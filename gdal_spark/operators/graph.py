@@ -149,6 +149,15 @@ def label_propagation(
     return labels
 
 
+def _mst_edges(edges: DataFrame, src: str, dst: str, w: str) -> DataFrame:
+    """Undirected (u, v, w) view with u <= v, typed as the input."""
+    return edges.select(
+        F.least(F.col(src), F.col(dst)).alias("u"),
+        F.greatest(F.col(src), F.col(dst)).alias("v"),
+        F.col(w).alias("w"),
+    )
+
+
 def boruvka_mst(
     edges: DataFrame, src: str = "src", dst: str = "dst", w: str = "w",
     max_rounds: int = 16,
@@ -163,13 +172,10 @@ def boruvka_mst(
     component graph (pointer jumping, O(log) rounds).  Component
     count at least halves per round, so rounds <= log2(n).
 
-    Returns the MST edge set (u, v, w) with u < v."""
+    Returns the MST edge set (u, v, w) with u < v; the column types
+    are those of the input's node and weight columns."""
     e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-            F.col(w).alias("w"),
-        )
+        _mst_edges(edges, src, dst, w)
         .filter("u <> v")
         .distinct()
         .localCheckpoint()
@@ -182,7 +188,7 @@ def boruvka_mst(
         .localCheckpoint()
     )
     spark = edges.sparkSession
-    mst = spark.createDataFrame([], "u long, v long, w long")
+    mst = spark.createDataFrame([], e.schema)
     for _ in range(max_rounds):
         g = (
             e.join(comp.selectExpr("node AS u", "c AS cu"), "u")
@@ -279,7 +285,7 @@ def boruvka_mst_auto(
         comp = {nd: find(c) for nd, c in comp.items()}
     return local_df(
         spark, sorted((u, v, ww) for ww, u, v in mst),
-        "u long, v long, w long")
+        _mst_edges(edges, src, dst, w).schema)
 
 
 def shortest_paths(

@@ -16,8 +16,8 @@ gcore/gdal_rasterband.h:149-150):
 
 Two entry points:
 - ``rasterize_points``  — value/count burn of a point DataFrame
-  (the web-density tile case: groupBy tile is an exact shuffle on the
-  tile key with map-side combine via the in-kernel bincount)
+  (the web-density tile case: a JVM per-pixel aggregate with map-side
+  partial combine, then one dense tile assembled per tile key)
 - ``rasterize_features`` — polygon/line burn via applyInPandas per
   tile with the exact scanline/Bresenham kernels
 """
@@ -36,6 +36,7 @@ from gdal_spark.kernels.burn import (
     burn_line,
     burn_points,
     burn_polygon,
+    copy_word,
     world_to_pixel,
 )
 from gdal_spark.kernels.geodesy import TILE_SIZE, lonlat_to_webmerc, tile_geotransform, tile_of_webmerc
@@ -53,19 +54,39 @@ TILE_SCHEMA = T.StructType(
 )
 
 
-def with_tile(points: DataFrame, z: int, lon="lon", lat="lat") -> DataFrame:
-    """Attach WebMercator (tx, ty) at zoom z (vectorized kernel)."""
+def with_tile(
+    points: DataFrame, z: int, lon="lon", lat="lat", tile_size: int = TILE_SIZE
+) -> DataFrame:
+    """Attach WebMercator (tx, ty) at zoom z and ``pix``, the flat
+    row-major pixel index inside that tile (vectorized kernel).
+
+    ``pix`` uses the ops a per-tile burn uses: ``world_to_pixel``
+    against the tile's own geotransform, then truncation, in bounds
+    only (``burn_points``).  A point whose pixel falls outside its
+    clamped tile (lon = 180, |lat| beyond the mercator clip) gets
+    ``pix = -1``; its row is kept, so its tile still materializes."""
 
     @F.pandas_udf(
-        T.StructType([T.StructField("tx", T.LongType()), T.StructField("ty", T.LongType())])
+        T.StructType(
+            [
+                T.StructField("tx", T.LongType()),
+                T.StructField("ty", T.LongType()),
+                T.StructField("pix", T.LongType()),
+            ]
+        )
     )
     def enc(lo: pd.Series, la: pd.Series) -> pd.DataFrame:
         mx, my = lonlat_to_webmerc(lo.to_numpy(np.float64), la.to_numpy(np.float64))
         tx, ty = tile_of_webmerc(mx, my, z)
-        return pd.DataFrame({"tx": tx, "ty": ty})
+        px_, py_ = world_to_pixel(mx, my, tile_geotransform(z, tx, ty, tile_size))
+        m = (px_ >= 0) & (px_ < tile_size) & (py_ >= 0) & (py_ < tile_size)
+        pix = np.full(tx.shape, -1, dtype=np.int64)
+        pix[m] = py_[m].astype(np.int64) * tile_size + px_[m].astype(np.int64)
+        return pd.DataFrame({"tx": tx, "ty": ty, "pix": pix})
 
     return points.withColumn("_t", enc(F.col(lon), F.col(lat))).select(
-        "*", F.col("_t.tx").alias("tx"), F.col("_t.ty").alias("ty")
+        "*", F.col("_t.tx").alias("tx"), F.col("_t.ty").alias("ty"),
+        F.col("_t.pix").alias("pix"),
     ).drop("_t")
 
 
@@ -77,51 +98,40 @@ def rasterize_points(
     value: str | None = None,
     dtype: str = "int32",
     tile_size: int = TILE_SIZE,
-    salt: int = 32,
 ) -> DataFrame:
     """Point-density (or value-sum) tiles at zoom z.
 
-    Shuffle analysis: point burn is ADD-mergeable, so the plan is a
-    SALTED two-phase aggregation — the tile key alone is badly skewed
-    on real corpora (web pages pile onto a handful of metro tiles; the
-    bench fixture's hottest z8 tile holds 27% of all points, which
-    would serialize the stage on one task no matter the cluster size).
-    Phase 1 shuffles points on (tx, ty, salt) where salt is a
-    deterministic hash of the coordinates mod ``salt``, so the hottest
-    tile fans out across ``salt`` reducers, each burning a partial
-    tile with the same bincount kernel (ADD merge semantics of the
-    reference's point burn, alg/gdalrasterize.cpp:312-390).  Phase 2
-    shuffles only the partial tiles — O(non-empty tiles × salt) rows,
-    independent of corpus size — and sums them vectorized per tile,
-    in salt order so float-valued burns are deterministic.  Output
-    rows are O(non-empty tiles), orders of magnitude smaller than the
-    input.  ``salt=1`` reproduces the single-phase plan.
-    """
-    pts = with_tile(points, z, lon, lat)
-    cols = [lon, lat] + ([value] if value else [])
+    Plan: encode → JVM pixel aggregate → assemble one tile per key.
+    ``with_tile`` gives each point its (tx, ty, pix); a JVM
+    ``groupBy(tx, ty, pix)`` counts (or sums ``value``) per pixel, and
+    Spark's partial HashAggregate below the exchange combines each map
+    task's rows down to at most ``tile_size²`` per tile.  That absorbs
+    the tile-key skew of real corpora (the bench fixture's hottest z8
+    tile holds 27% of all points) without salting, and only sparse
+    (pix, v) rows cross into Python.  A second exchange on (tx, ty)
+    feeds ``applyInPandas``, which scatters the rows into one dense
+    tile and ignores ``pix < 0``.  This is the ADD-merge point burn of
+    alg/gdalrasterize.cpp:312-390: a count burn goes through
+    ``copy_word`` like the single-phase ``burn_points(merge_add=True)``,
+    a value burn through ``astype(dtype)``.  Value sums are exact, and
+    so independent of Spark's summation order, whenever the partial
+    sums are representable (e.g. dyadic weights)."""
+    pts = with_tile(points, z, lon, lat, tile_size)
+    agg = F.count(F.lit(1)) if value is None else F.sum(F.col(value).cast("double"))
+    pixels = pts.groupBy("tx", "ty", "pix").agg(agg.alias("v"))
+    dt = np.dtype(dtype)
 
-    def burn_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        gt = tile_geotransform(z, tx, ty, tile_size)
-        mx, my = lonlat_to_webmerc(
-            pdf[lon].to_numpy(np.float64), pdf[lat].to_numpy(np.float64)
-        )
-        px_, py_ = world_to_pixel(mx, my, gt)
-        arr = np.zeros((tile_size, tile_size), dtype=np.dtype(dtype))
-        if value is None:
-            burn_points(arr, px_, py_, 1, merge_add=True)
-        else:
-            vals = pdf[value].to_numpy(np.float64)
-            # per-pixel sum of values: vectorized bincount weighted add
-            m = (px_ >= 0) & (px_ < tile_size) & (py_ >= 0) & (py_ < tile_size)
-            flat = py_[m].astype(np.int64) * tile_size + px_[m].astype(np.int64)
-            acc = np.bincount(flat, weights=vals[m], minlength=tile_size * tile_size)
-            arr = acc.reshape(tile_size, tile_size).astype(np.dtype(dtype))
+    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        pix = pdf["pix"].to_numpy()
+        m = pix >= 0
+        acc = np.zeros(tile_size * tile_size, dtype=np.float64)
+        acc[pix[m]] += pdf["v"].to_numpy(np.float64)[m]
+        arr = copy_word(acc, dt) if value is None else acc.astype(dt)
         return pd.DataFrame(
             {
                 "z": [z],
-                "tx": [tx],
-                "ty": [ty],
+                "tx": [int(key[0])],
+                "ty": [int(key[1])],
                 "band": [1],
                 "data": [arr.tobytes()],
                 "dtype": [dtype],
@@ -129,37 +139,7 @@ def rasterize_points(
             }
         )
 
-    if salt <= 1:
-        return pts.select("tx", "ty", *cols).groupBy("tx", "ty").applyInPandas(
-            burn_tile, TILE_SCHEMA
-        )
-
-    partial_schema = T.StructType(
-        TILE_SCHEMA.fields + [T.StructField("salt", T.IntegerType())]
-    )
-
-    def burn_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = burn_tile(key[:2], pdf)
-        out["salt"] = int(key[2])
-        return out
-
-    def merge_partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("salt")
-        dt = np.dtype(pdf["dtype"].iloc[0])
-        acc = np.frombuffer(pdf["data"].iloc[0], dtype=dt).copy()
-        for blob in pdf["data"].iloc[1:]:
-            acc += np.frombuffer(blob, dtype=dt)
-        out = pdf.iloc[:1].drop(columns=["salt"]).copy()
-        out["data"] = [acc.tobytes()]
-        return out
-
-    salted = pts.select("tx", "ty", *cols).withColumn(
-        "_salt", F.pmod(F.hash(F.col(lon), F.col(lat)), F.lit(int(salt)))
-    )
-    partials = salted.groupBy("tx", "ty", "_salt").applyInPandas(
-        burn_partial, partial_schema
-    )
-    return partials.groupBy("tx", "ty").applyInPandas(merge_partials, TILE_SCHEMA)
+    return pixels.groupBy("tx", "ty").applyInPandas(assemble, TILE_SCHEMA)
 
 
 def rasterize_features(
@@ -284,8 +264,7 @@ def rasterize_wkb_grid(
 
     ``salt`` > 1 splits each block's feature list across ``salt``
     reducers keyed by ``_feature_seq % salt`` — the skew escape for a
-    hot block covered by a large share of all features (same shape as
-    ``rasterize_points``).  ADD partials merge by vectorized sum;
+    hot block covered by a large share of all features.  ADD partials merge by vectorized sum;
     REPLACE partials additionally burn each feature's sequence number
     into a parallel array with the same kernels, and the merge keeps
     the per-pixel value of the HIGHEST sequence — exactly the

@@ -12,8 +12,11 @@ structural):
   starts from a co-partitioned scan instead of a shuffle;
 - the polygon side is broadcast (cover-set rows, not geometry blobs ×
   points);
-- the only big-data shuffles are the tile groupBy (keys = occupied
-  tiles) and the pyramid rollups (4× smaller per level);
+- the only big-data shuffles are the tile burn's and the pyramid
+  rollups' (4× smaller per level).  The burn shuffles per-pixel
+  partial counts, combined map-side, on (tx, ty, pix), then at most
+  one row per occupied pixel on (tx, ty): the hot metro tiles cost
+  at most tile_size² rows per map task, not their point count;
 - hot metro cells are pre-salted (salt_factor) *and* AQE skew-split.
 """
 

@@ -19,6 +19,21 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 65_536
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 24g: in local mode the driver
+    heap holds every executor too, and a heap larger than the host lets
+    the JVM grow until the kernel kills it."""
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mb, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "gdal_spark",
     cores: int | None = None,
@@ -50,7 +65,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_BATCH_ROWS),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )

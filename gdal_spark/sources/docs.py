@@ -19,6 +19,7 @@ curves compare synthetic-to-synthetic, apples to apples.
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -114,16 +115,24 @@ def write_scale_dir(path: str, n_docs: int, n_vecs: int,
     of files; the probe's layout must match or the scaling numbers
     measure the file count, not the engine.
 
-    Idempotent: a marker file records the materialized shape."""
+    Idempotent: a marker file records the materialized shape.  Without
+    it, every table directory and older marker is cleared first: part
+    files of a previous layout would otherwise survive beside the new
+    ones and be read as duplicate rows."""
     marker = os.path.join(path, f".synth_v3_{n_docs}_{n_vecs}")
     if os.path.exists(marker):
         return path
+    os.makedirs(path, exist_ok=True)
+    for name in os.listdir(path):
+        if name.startswith(".synth_"):
+            os.remove(os.path.join(path, name))
     for sub, n, gen in (("documents.parquet", n_docs,
                          synth_documents_pdf),
                         ("embeddings.parquet", n_vecs,
                          synth_embeddings_pdf)):
         d = os.path.join(path, sub)
-        os.makedirs(d, exist_ok=True)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
         # ~32 parts per table (floor 2500 rows) — one scan task per
         # core on the bench host, thousands-of-files-like at 100 TB
         ch = min(chunk, max(2_500, -(-n // 32)))

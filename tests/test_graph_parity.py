@@ -63,3 +63,21 @@ def test_gate_routes_large_to_distributed(spark):
     # threshold 0 forces the distributed path through the gate
     assert _canon(boruvka_mst_auto(e, threshold=0)) == _canon(
         boruvka_mst(e))
+
+
+def test_double_weights_same_schema_both_sides_of_gate(spark):
+    # the driver path used to hardcode `w long`; DOUBLE weights must
+    # come back as DOUBLE, with identical rows, whichever side runs
+    rows = []
+    for i in range(60):
+        for d in (1, 2, 5, 9):
+            j = (i * 2654435761 + d) % 60
+            if i != j:
+                rows.append((i, j, 0.125 + 0.5 * ((i * 31 + j * 17) % 7)))
+    e = local_df(spark, rows, "src long, dst long, w double")
+    drv = boruvka_mst_auto(e, threshold=200_000)
+    dist = boruvka_mst_auto(e, threshold=0)
+    schema = [(f.name, f.dataType.simpleString()) for f in drv.schema]
+    assert schema == [("u", "bigint"), ("v", "bigint"), ("w", "double")]
+    assert schema == [(f.name, f.dataType.simpleString()) for f in dist.schema]
+    assert _canon(drv) == _canon(dist) and len(_canon(drv)) > 0

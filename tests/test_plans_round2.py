@@ -1,5 +1,5 @@
-"""Plan hygiene for the round-2 operators: salted burns add exactly
-one extra (tiny, fixed-size) exchange; pansharpen's parent-tile join
+"""Plan hygiene for the round-2 operators: the point burn combines
+pixels map-side before its tile exchanges; pansharpen's parent-tile join
 is an equi-join; the native geocode stage has no Python node."""
 
 from __future__ import annotations
@@ -16,20 +16,28 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_salted_point_burn_has_two_exchanges(spark):
+def test_point_burn_pixel_aggregate_plan(spark):
     from gdal_spark.operators.rasterize import rasterize_points
     from gdal_spark.sources.pages import geocode_encode, synth_pages
 
     geo = geocode_encode(synth_pages(spark, 2000, 4), res_list=(7,))
-    plan = plan_of(rasterize_points(geo, z=8, salt=32))
-    hashes = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    # phase 1 shuffles points on (tx, ty, salt); phase 2 shuffles only
-    # partial tiles on (tx, ty) — O(tiles x salt), corpus-independent.
+    plan = plan_of(rasterize_points(geo, z=8))
+    lines = plan.splitlines()
     # (synth_pages itself contributes a repartition exchange upstream —
     # count only the tile-keyed ones)
-    tile_hashes = [h for h in hashes if "tx" in h]
-    assert len(tile_hashes) == 2
-    assert any("_salt" in h for h in tile_hashes)
+    tile_ex = []
+    for i, ln in enumerate(lines):
+        m = re.search(r"Exchange hashpartitioning\(([^)]*)\)", ln)
+        if m and "tx" in m.group(1):
+            keys = re.sub(r"#\d+L?", "", m.group(1)).split(", ")[:-1]
+            tile_ex.append((i, keys))
+    # pixels shuffle on (tx, ty, pix) after the map-side combine; only
+    # the aggregated pixel rows shuffle again on (tx, ty)
+    assert [keys for _, keys in tile_ex] == [["tx", "ty"], ["tx", "ty", "pix"]]
+    pix_ex = tile_ex[1][0]
+    assert "HashAggregate" in lines[pix_ex + 1]
+    assert "partial_count" in lines[pix_ex + 1]
+    assert "_salt" not in plan
     assert "CartesianProduct" not in plan
 
 
