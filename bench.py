@@ -19,798 +19,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-HEADLINE = [
-    "q01_filter_project",
-    "q02_summary_agg",
-    "q03_distinct",
-    "q04_orderby_limit",
-    "q05_groupby_agg",
-    "q06_left_join",
-    "q07_union_all",
-    "q08_expressions",
-    "q09_events_hourly",
-    "q10_sessionize",
-    "q11_spatial_pip_join",
-    "q12_zonal_stats",
-    "q13_knn",
-    "q14_raster_density",
-    "q15_tile_pyramid",
-    "q16_cell_index",
-    "q17_dedup_exact",
-    "q18_minhash_lsh",
-    "q19_ngram_jaccard",
-    "q20_simhash",
-    "q21_text_quality",
-    "q22_lang_id",
-    "q23_cosine_topk",
-    "q24_grid_idw",
-    "q25_rasterize_burn",
-    "q26_polygonize",
-    "q27_focal_sum",
-    "q28_horn_slope",
-    "q29_overlay_intersection",
-    "q30_spatial_sort_morton",
-    "q31_interpolate_bilinear",
-    "q32_ann_ivf",
-    "q33_graph_cc",
-    "q34_winnow_fingerprint",
-    "q35_multimodal_meta",
-    "q37_checksum",
-    "q38_band_stats",
-    "q39_ogrsql_veneer",
-    "q40_json_props",
-    "q41_sieve_filter",
-    "q42_contour_cells",
-    "q43_erase_area",
-    "q44_zonal_raster",
-    "q45_proximity",
-    "q46_knn_cell_rings",
-    "q47_shortest_paths",
-    "q48_bpe_tokens",
-    "q49_embed_neardup",
-    "q51_polygonize_geometry",
-    "q52_polygonize_dissolved",
-    "q53_raster_calc",
-    "q54_contour_polylines",
-    "q55_grid_metrics",
-    "q56_pyramid_mode",
-    "q57_band_histogram",
-    "q58_line_burn",
-    "q59_knn_radius",
-    "q60_simhash_pairs",
-    "q62_polygonize_8conn",
-    "q63_contour_linestrings",
-    "q64_k_shortest",
-    "q65_warp_nearest",
-    "q66_warp_bilinear",
-    "q67_all_touched",
-    "q68_sieve_merge",
-    "q69_proximity_unbounded",
-    "q70_dem_tri",
-    "q71_dem_tpi",
-    "q72_dem_roughness",
-    "q73_dem_hillshade",
-    "q74_dem_aspect_octant",
-    "q75_color_relief",
-    "q76_overlay_union",
-    "q77_overlay_symdiff",
-    "q78_overlay_identity",
-    "q79_overlay_update",
-    "q80_overlay_clip",
-    "q81_mosaic_last",
-    "q82_translate",
-    "q83_segmentize",
-    "q84_binary_predicates",
-    "q85_warp_cubic",
-    "q87_geocode_cells",
-    "q88_band_percentiles",
-    "q89_spatial_sort_hilbert",
-    "q90_contour_polygons",
-    "q91_fillnodata",
-    "q92_stratified_sample",
-    "q93_sequence_packing",
-    "q94_dedup_canonical",
-    "q95_warp_rotated",
-    "q96_zonal_mode_variety",
-    "q97_tile_index",
-    "q98_contour_bands",
-    "q99_viewshed",
-    "q100_flagship_density",
-    "q101_simhash64_pairs",
-    "q102_pyramid_bilinear",
-    "q103_pyramid_cubic",
-    "q104_pyramid_cubicspline",
-    "q105_pyramid_lanczos",
-    "q106_pyramid_gauss",
-    "q107_pyramid_rms",
-    "q108_st_distance",
-    "q109_st_centroid",
-    "q110_st_convexhull",
-    "q111_st_simplify",
-    "q112_overlay_general_intersection",
-    "q113_overlay_general_union",
-    "q114_overlay_general_difference",
-    "q115_overlay_general_symdiff",
-    "q116_zonal_minority_frac",
-    "q117_zonal_weighted",
-    "q118_zonal_minmax_center",
-    "q119_grid_linear_tin",
-    "q120_grid_idw_quadrant",
-    "q121_utm_roundtrip",
-    "q122_lcc_roundtrip",
-    "q123_predicates_general",
-    "q124_spatial_join_df_cover",
-    "q125_wkb_zm_stats",
-    "q126_curvepolygon_linearize",
-    "q127_ivf_kmeans",
-    "q128_ann_ivf_trained",
-    "q129_resize_images",
-    "q130_video_frames",
-    "q131_fillnodata_idw",
-    "q132_buffer",
-    "q133_extract_text",
-    "q134_pansharpen",
-    "q135_warp_cutline",
-    "q136_polyhedral_surface",
-    "q137_overlay_shared_edge",
-    "q138_pq_encode",
-    "q139_ann_recall",
-    "q140_audio_frames",
-    "q141_makevalid",
-    "q143_lsh_buckets",
-    "q144_rasterize_invert",
-    "q145_image_ahash_dedup",
-    "q146_training_pipeline",
-    "q147_mdarray",
-    "q148_pq_ann_search",
-    "q149_overlay_exact_noded",
-    "q150_viewshed_wang",
-    "q151_overlay_geom_intersection",
-    "q152_overlay_geom_union",
-    "q153_overlay_geom_difference",
-    "q154_overlay_geom_symdiff",
-    "q155_makevalid_star",
-    "q156_buffer_concave",
-    "q157_warp_lanczos",
-    "q158_warp_average",
-    "q159_warp_mode",
-    "q160_warp_rms",
-    "q161_geodesic_length",
-    "q162_geodesic_area",
-    "q163_raster_attribute_table",
-    "q164_complex_calc",
-    "q165_url_canonical_dedup",
-    "q166_contamination_ngram",
-    "q167_repetition_stats",
-    "q168_cumulative_viewshed",
-    "q169_warp_average_rotated",
-    "q170_warp_mode_rotated",
-    "q171_warp_rms_rotated",
-    "q172_geodesic_antipodal",
-    "q173_helmert_datum_roundtrip",
-    "q174_albers_roundtrip",
-    "q175_organize_polygons",
-    "q176_wrapdateline",
-    "q177_hstore_get_value",
-    "q178_tfidf_top_term",
-    "q179_bm25",
-    "q181_point_on_surface",
-    "q182_union_cascaded",
-    "q183_force_multi",
-    "q184_curation_pipeline_v2",
-    "q185_touches_general",
-    "q186_line_crosses",
-    "q187_rare_ngram_ratio",
-    "q188_host_stats",
-    "q189_repeated_spans",
-    "q190_host_pagerank",
-    "q191_pii_redaction",
-    "q192_median_cut_rgb2pct",
-    "q193_pixel_functions",
-    "q194_quality_classifier",
-    "q195_paragraph_dedup",
-    "q196_fs_dither",
-    "q197_gcp_affine_fit",
-    "q198_rpc_transform",
-    "q199_geoloc_inverse",
-    "q200_homography",
-    "q201_surf_keypoints",
-    "q202_feature_matching",
-    "q203_polyharmonic_gcp",
-    "q204_importance_weights",
-    "q205_vertical_shift_grid",
-    "q206_cdx_capture_dedup",
-    "q207_anchor_text",
-    "q208_waterfill_quota",
-    "q210_mvt_point_tiles",
-    "q211_geojson_export",
-    "q212_curation_matrix",
-    "q213_incremental_tiles",
-    "q214_hist_equalize",
-    "q215_concave_hull_alpha",
-    "q216_nearblack",
-    "q217_lineref_coord",
-    "q218_pct2rgb_ramp",
-    "q219_gdalcompare",
-    "q220_blend_modes",
-    "q221_reclassify_intervals",
-    "q222_power_scale",
-    "q223_pixel_info",
-    "q224_raster_xyz",
-    "q225_coverage_check",
-    "q226_delaunay_triangles",
-    "q227_raster_neighbors",
-    "q228_robots_longest_match",
-    "q229_domain_blocklist",
-    "q230_semdedup",
-    "q231_bpe_train",
-    "q232_gopher_rules",
-    "q233_bpe_apply",
-    "q234_simplify_coverage",
-    "q236_suffix_array",
-    "q237_lcp_array",
-    "q238_exact_substr_dedup",
-    "q239_gopher_dup_lines",
-    "q240_gopher_ngram_rep",
-    "q241_hits",
-    "q242_boilerplate_lines",
-    "q243_ccnet_lm_buckets",
-    "q244_phrase_search",
-    "q245_dem_hillshade_multidirectional",
-    "q246_dem_hillshade_igor",
-    "q247_dem_hillshade_combined",
-    "q248_hist_match",
-    "q249_unigram_viterbi",
-    "q250_minhash_eval",
-    "q251_coverage_clean",
-    "q252_frontier_schedule",
-    "q253_recrawl_history",
-    "q254_warc_layout",
-    "q255_point_in_time",
-    "q256_tfidf_keywords",
-    "q257_link_spam_signals",
-    "q258_fm_index_count",
-    "q259_raster_set_type",
-    "q260_raster_update",
-    "q261_nodata_to_alpha",
-    "q262_check_geometry",
-    "q263_vector_dissolve",
-    "q264_dem_aspect_degrees",
-    "q265_dem_slope_percent",
-    "q266_hard_negatives",
-    "q267_tokenizer_fertility",
-    "q268_binomial_smooth5",
-    "q269_postings_gamma_bits",
-    "q270_mvt_line_encode",
-    "q271_raster_trend",
-    "q272_pyramid_audit",
-    "q273_text_normalize_hash",
-    "q274_eval_apportionment",
-    "q275_triangles",
-    "q276_kcore",
-    "q277_two_hop_reach",
-    "q278_countmin_sketch",
-    "q279_hll_cardinality",
-    "q280_trustrank",
-    "q281_anchor_text",
-    "q282_bloom_blocklist",
-    "q283_shingle_containment",
-    "q284_chisq_drift",
-    "q285_vbyte_postings",
-    "q286_salsa_authority",
-    "q287_conjunctive_planning",
-    "q288_url_features",
-    "q289_rrf_fusion",
-    "q290_pmi_collocations",
-    "q291_link_prediction",
-    "q292_truncated_recall",
-    "q293_rendezvous_hashing",
-    "q294_logbin_quantiles",
-    "q295_kwic_snippets",
-    "q296_bipartite_check",
-    "q297_bigram_lm_surprisal",
-    "q298_wand_block_pruning",
-    "q299_change_rate",
-    "q300_host_scorecard",
-    "q301_symspell_correction",
-    "q302_passage_chunking",
-    "q303_newcomer_dedup",
-    "q304_crawl_trap_detection",
-    "q305_consistent_hash_ring",
-    "q306_burst_detection",
-    "q307_degree_assortativity",
-    "q308_cdc_boundaries",
-    "q309_scc_of_pivot",
-    "q310_index_partition_balance",
-    "q311_streaming_hll",
-    "q312_mmr_diversified_topk",
-    "q313_cross_source_contamination",
-    "q314_stratified_hash_sampling",
-    "q315_padding_waste",
-    "q316_conversion_funnel",
-    "q317_retention_cohorts",
-    "q318_crawl_index_venn",
-    "q319_seasonal_outliers",
-    "q320_readability_gate",
-    "q321_bot_regularity",
-    "q322_entity_resolution",
-    "q323_host_template_detection",
-    "q324_markov_transitions",
-    "q325_covisitation_recs",
-    "q326_centrality_rank_correlation",
-    "q327_autocomplete_prefixes",
-    "q328_streaming_countmin",
-    "q329_crawl_snapshot_diff",
-    "q330_cache_admission_planning",
-    "q331_local_bridges",
-    "q332_cluster_health",
-    "q333_passage_dedup",
-    "q334_last_touch_attribution",
-    "q335_sliding_distinct_users",
-    "q336_time_to_convert",
-    "q337_heaps_vocab_growth",
-    "q338_zipf_products",
-    "q339_vocab_oov_tradeoff",
-    "q340_language_geography",
-    "q341_host_geo_concentration",
-    "q342_geofence_compliance",
-    "q343_sparse_tfidf_neighbor",
-    "q344_index_maintenance_cost",
-    "q345_term_proximity",
-    "q346_topic_tagging",
-    "q347_ab_wilson_bounds",
-    "q348_corpus_datasheet",
-    "q349_crawl_yield",
-    "q350_recrawl_budget",
-    "q351_image_hamming_neardup",
-    "q352_storage_tiering",
-    "q353_modularity",
-    "q354_glove_cooccurrence",
-    "q355_negative_sampling_table",
-    "q356_epoch_shuffle",
-    "q357_dedup_decision_matrix",
-    "q358_license_propagation",
-    "q359_redirect_resolution",
-    "q360_hreflang_symmetry",
-    "q361_index_shard_merge",
-    "q362_highlight_offsets",
-    "q363_weak_supervision_vote",
-    "q364_release_pipeline",
-    "q365_binary_embedding_recall",
-    "q366_skew_report",
-    "q367_effective_tokens",
-    "q368_leakage_safe_splits",
-    "q369_view_dwell_time",
-    "q370_term_range_partitions",
-    "q371_stack_distance",
-    "q372_ranking_mrr",
-    "q373_position_bias_ctr",
-    "q374_latency_percentiles",
-    "q375_snapshot_gc",
-    "q376_quadtree_build",
-    "q377_language_gini",
-    "q378_span_corruption_plan",
-    "q379_exact_auc",
-    "q380_shuffle_sharding",
-    "q381_calibration_ece",
-    "q382_interval_coverage",
-    "q383_chao1_richness",
-    "q384_zonemap_skipping",
-    "q385_kcenter_coreset",
-    "q386_kanonymity_audit",
-    "q387_watermark_planning",
-    "q388_merkle_replica_diff",
-    "q389_geo_density_clusters",
-    "q390_join_order_planning",
-    "q391_delta_transfer",
-    "q392_simpsons_paradox",
-    "q393_reshard_migration",
-    "q394_encoding_selection",
-    "q395_kendall_tau",
-    "q396_cas_storage",
-    "q397_deletion_cascade",
-    "q398_equidepth_histogram",
-    "q399_pareto_frontier",
-    "q400_release_scorecard",
-    "q401_hex_binning",
-    "q402_geohash_cells",
-    "q403_typosquat_domains",
-    "q404_quadkey_tiles",
-    "q405_dp_geometric_release",
-    "q406_cohens_kappa",
-    "q407_geo_principal_axis",
-    "q408_emd_drift",
-    "q409_pass_at_k",
-    "q410_mirror_hosts",
-    "q412_arena_ranking",
-    "q413_lsm_amplification",
-    "q414_bleu_precisions",
-    "q415_snap_to_segment",
-    "q416_matryoshka_recall",
-    "q417_set_cover_sources",
-    "q418_quadkey_compact",
-    "q419_occ_conflicts",
-    "q420_geodesic_destination",
-    "q421_temperature_mixing",
-    "q422_hll_merge_proof",
-    "q423_cell_covering",
-    "q424_clustering_benefit",
-    "q425_anf_reachability",
-    "q426_benford_audit",
-    "q427_fisher_separability",
-    "q428_huffman_dictionary",
-    "q429_grouping_sets_report",
-    "q430_range_frame_load",
-    "q431_lsh_s_curve",
-    "q432_hex_kring",
-    "q433_dedup_transitivity",
-    "q434_polar_stereo_roundtrip",
-    "q435_merge_apply",
-    "q436_scatter_gather_topk",
-    "q437_code_switching",
-    "q438_ndcg_at_10",
-    "q439_contribution_analysis",
-    "q440_markov_absorption",
-    "q441_fanout_tail_latency",
-    "q442_hypsometric_curve",
-    "q443_sample_size_planning",
-    "q444_pipeline_bubble",
-    "q445_moe_capacity_overflow",
-    "q446_hedged_requests",
-    "q447_erasure_durability",
-    "q448_warp_order_stats",
-    "q449_dem_zt",
-    "q450_checkpoint_interval",
-    "q451_speculative_decoding",
-    "q452_late_interaction_maxsim",
-    "q453_audio_vad_frames",
-    "q454_haar_energy",
-    "q455_chrf_score",
-    "q456_quorum_planning",
-    "q457_shot_boundaries",
-    "q458_label_propagation",
-    "q459_allreduce_planning",
-    "q460_whash_dedup",
-    "q461_kv_cache_planning",
-    "q462_theil_sen",
-    "q463_shapley_attribution",
-    "q464_pooled_testing",
-    "q465_bwt_runs",
-    "q466_d8_flow",
-    "q467_join_cardinality_audit",
-    "q468_reed_solomon_pq",
-    "q469_randomized_response",
-    "q470_token_bucket",
-    "q471_policy_replay",
-    "q472_boruvka_mst",
-    "q473_focal_majority",
-    "q474_kneser_ney",
-    "q475_nms_detections",
-    "q476_rank_select",
-    "q477_loo_influence",
-    "q479_littles_law",
-    "q480_isotonic_calibration",
-    "q481_mm1_sizing",
-    "q482_mvt_polygon_encode",
-    "q483_curvature_landforms",
-    "q484_fm_locate",
-    "q485_btree_height",
-    "q486_sax_motifs",
-    "q487_trimmed_stats",
-    "q488_second_price_auction",
-    "q489_slo_burn_alerts",
-    "q490_drf_allocation",
-    "q491_abr_ladder",
-    "q492_gallop_vs_merge",
-    "q493_critical_path",
-    "q494_utm_zone_select",
-    "q495_feature_hashing",
-    "q496_theta_sketch",
-    "q497_rank_biased_overlap",
-    "q498_frecency_hotset",
-    "q499_median_ci",
-    "q500_geoweb_pipeline",
-    "q501_morans_i",
-    "q502_ripleys_k",
-    "q503_getis_ord_gistar",
-    "q504_gearys_c",
-    "q505_lisa_quadrants",
-    "q506_join_counts",
-    "q507_semivariogram",
-    "q508_quadrat_vmr",
-    "q509_dbscan",
-    "q510_knox_spacetime",
-    "q511_mann_kendall_hotspots",
-    "q512_clark_evans_nn",
-    "q513_proximity_graphs",
-    "q514_huff_market_areas",
-    "q515_change_vector_analysis",
-    "q516_max_ndvi_composite",
-    "q517_cost_distance",
-    "q518_areal_interpolation",
-    "q519_d8_flow_accumulation",
-    "q520_strahler_order",
-    "q521_watershed_basins",
-    "q522_hmm_map_matching",
-    "q523_cross_k_bivariate",
-    "q524_colocation_mining",
-    "q525_discrete_frechet",
-    "q526_quantile_sketch_merge",
-    "q527_label_placement_mis",
-    "q528_chaikin_smoothing",
-    "q529_str_rtree_packing",
-    "q530_axis_order_audit",
-    "q531_mvcc_visibility",
-    "q532_allen_interval_algebra",
-    "q533_voptimal_histogram",
-    "q534_kalman_filter",
-    "q535_spatial_scan",
-    "q536_interval_stabbing",
-    "q537_systematic_pps",
-    "q538_union_of_rectangles",
-    "q539_antialiased_coverage",
-    "q540_bresenham_closed_form",
-    "q541_integral_image",
-    "q542_rotating_calipers",
-    "q543_min_enclosing_circle",
-    "q544_otsu_threshold",
-    "q545_bayer_ordered_dither",
-    "q546_binary_morphology",
-    "q547_hough_line_detection",
-    "q548_max_empty_rectangle",
-    "q549_stress_centrality",
-    "q550_pole_of_inaccessibility",
-    "q551_zhang_suen_thinning",
-    "q552_stable_matching",
-    "q553_rouge_l_lcs",
-    "q554_walsh_hadamard",
-    "q555_least_cost_path",
-    "q556_visvalingam",
-    "q557_adler32_combine",
-    "q558_dinf_flow",
-    "q559_ntt_convolution",
-    "q560_cusum_drift",
-    "q561_dtw_alignment",
-    "q562_fill_depressions",
-    "q563_misra_gries_merge",
-    "q564_crc32_linear",
-    "q565_ear_clipping",
-    "q566_conflict_serializability",
-    "q567_pagerank_exact",
-    "q568_vector_clocks",
-    "q569_count_min_sketch",
-    "q570_floyd_steinberg",
-    "q571_canny_edges",
-    "q572_elias_fano",
-    "q573_mann_whitney_auc",
-    "q574_bwt_roundtrip",
-    "q575_merkle_proofs",
-    "q576_consistent_hashing",
-    "q577_johnson_flowshop",
-    "q578_glcm_haralick",
-    "q579_seam_carving",
-    "q580_aho_corasick",
-    "q581_longest_common_substring",
-    "q582_orset_crdt",
-    "q583_fm_index_search",
-    "q584_hyperloglog",
-    "q585_golomb_rice",
-    "q586_bloom_filter",
-    "q587_lru_stack_distance",
-    "q588_condorcet_smith",
-    "q589_knapsack_dp",
-    "q590_web_bowtie",
-    "q591_konig_matching",
-    "q592_url_tree_lca",
-    "q593_boruvka_mst",
-    "q594_k_anonymity",
-    "q595_wald_sprt",
-    "q596_miller_rabin",
-    "q597_two_sat",
-    "q598_sprague_grundy",
-    "q599_edmonds_karp",
-    "q600_held_karp_tsp",
-    "q601_debruijn_lyndon",
-    "q602_zeckendorf",
-    "q603_continued_fractions",
-    "q604_assignment_duality",
-    "q605_lights_out_gf2",
-    "q606_cyk_catalan",
-    "q607_apriori_itemsets",
-    "q608_quadratic_reciprocity",
-    "q609_lis_erdos_szekeres",
-    "q610_dfa_minimization",
-    "q611_game_of_life",
-    "q612_hamming_perfect_code",
-    "q613_burnside_necklaces",
-    "q614_min_cost_flow",
-    "q615_gray_code",
-    "q616_matrix_chain",
-    "q617_josephus",
-    "q618_rsa_permutation",
-    "q619_sorting_network",
-    "q620_lp_duality",
-    "q621_bell_stirling",
-    "q622_interval_scheduling",
-    "q623_addition_chains",
-    "q624_hmm_forward_backward",
-    "q625_inclusion_exclusion",
-    "q626_pascal_identities",
-    "q627_fenwick_tree",
-    "q628_huffman_optimality",
-    "q629_seven_queens",
-    "q630_ramsey_r33",
-    "q631_derangements",
-    "q632_tictactoe_solved",
-    "q633_wythoff_beatty",
-    "q634_primes_legendre",
-    "q635_totient_mobius",
-    "q636_markov_kolmogorov",
-    "q637_shamir_sharing",
-    "q638_farey_sequence",
-    "q639_picks_theorem",
-    "q640_latin_squares",
-    "q641_shidoku_minimal",
-    "q642_abelian_sandpile",
-    "q643_busy_beaver_2",
-    "q644_cayley_prufer",
-    "q645_matrix_tree",
-    "q646_dedekind_sperner",
-    "q647_erdos_ko_rado",
-    "q648_mantel_turan",
-    "q649_konigsberg",
-    "q650_domino_tilings",
-    "q651_hook_length",
-    "q652_five_puzzle",
-    "q653_thue_morse",
-    "q654_two_squares",
-    "q655_three_four_squares",
-    "q656_wilson_primroots",
-    "q657_lucas_lehmer",
-    "q658_bankers_algorithm",
-    "q659_peterson_model_check",
-    "q660_three_distance",
-    "q661_gilbreath",
-    "q662_pancake_sorting",
-    "q663_magic_square",
-    "q664_calkin_wilf",
-    "q665_fibonacci_gcd",
-    "q666_collatz_range",
-    "q667_kaprekar",
-    "q668_ford_apollonian",
-    "q669_eulerian_numbers",
-    "q670_frobenius",
-    "q671_stirling_cycles",
-    "q672_motzkin",
-    "q673_delannoy",
-    "q674_inequalities",
-    "q675_vandermonde",
-    "q676_ceva_menelaus",
-    "q677_equable_triangles",
-    "q678_pell",
-    "q679_markov_triples",
-    "q680_gf8_axioms",
-    "q681_groups_of_order_8",
-    "q682_sicherman_dice",
-    "q683_efron_dice",
-    "q684_stable_matching",
-    "q685_penney_game",
-    "q686_hadamard_maxdet",
-    "q687_fano_plane",
-    "q688_ntt_convolution",
-    "q689_lfsr_golomb",
-    "q690_cayley_hamilton",
-    "q691_smith_normal_form",
-    "q692_euler_line",
-    "q693_routh_theorem",
-    "q694_secretary_problem",
-    "q695_fine_wilf",
-    "q696_partition_pentagonal",
-    "q697_faulhaber_bernoulli",
-    "q698_hex_theorem",
-    "q699_dilworth_mirsky",
-    "q700_chromatic_brooks",
-    "q701_best_theorem",
-    "q702_d4_subgroup_lattice",
-    "q703_wieferich_wolstenholme",
-    "q704_radon_happy_ending",
-    "q705_egyptian_greedy",
-    "q706_coupon_gambler",
-    "q707_ballot_arcsine",
-    "q708_sperner_lemma",
-    "q709_birkhoff_von_neumann",
-    "q710_nash_2x2",
-    "q711_may_theorem",
-    "q712_erdos_gallai",
-    "q713_tournament_redei",
-    "q714_matroid_axioms",
-    "q715_oddtown_eventown",
-    "q716_cauchy_davenport",
-    "q717_erdos_ginzburg_ziv",
-    "q718_sylvester_gallai",
-    "q719_monge_northwest",
-    "q720_triangle_inequalities",
-    "q721_langford_pairings",
-    "q722_schur_vanderwaerden",
-    "q723_sidon_sets",
-    "q724_perrin_test",
-    "q725_catalan_nagell",
-    "q726_heegner_class_numbers",
-    "q727_bang_zsygmondy",
-    "q728_pythagorean_tree",
-    "q729_e_continued_fraction",
-    "q730_pratt_certificate",
-    "q731_gauss_sums",
-    "q732_chinese_remainder",
-    "q733_modular_sqrt",
-    "q734_lz77_parsing",
-    "q735_good_turing",
-    "q736_myers_bitparallel",
-    "q737_utf8_validation",
-    "q738_polyline_codec",
-    "q739_ppr_push",
-    "q740_alias_method",
-    "q741_knuth_plass",
-    "q742_maxscore_pruning",
-    "q743_hilbert_continuity",
-    "q744_aimd_fairness",
-    "q745_rate_monotonic",
-    "q746_cuckoo_feasibility",
-    "q747_xor_filter",
-    "q748_raft_invariants",
-    "q749_public_suffix",
-    "q750_deficit_round_robin",
-    "q751_percent_normalization",
-    "q752_ddsketch_quantiles",
-    "q753_boyer_moore_majority",
-    "q754_ski_rental",
-    "q755_stable_roommates",
-    "q756_semijoin_bloom",
-    "q757_unique_late_supplier",
-    "q758_refpoint_dedup",
-    "q759_tile_clip_conservation",
-    "q760_iso_week_dates",
-    "q761_session_threshold_curve",
-    "q762_smith_waterman",
-    "q763_two_phase_commit",
-    "q764_dremel_levels",
-    "q765_aries_redo",
-    "q766_exactly_once",
-    "q767_median_of_medians",
-    "q768_roaring_containers",
-    "q769_weighted_median",
-    "q770_sort_to_compress",
-    "q771_allowed_lateness",
-    "q772_ams_sketch",
-    "q773_write_skew",
-    "q774_gsp_vcg_auctions",
-    "q775_lpt_makespan",
-    "q776_sfc_range_decomposition",
-    "q777_cdc_shift_resistance",
-    "q778_stream_join_state",
-    "q779_tombstone_discipline",
-    "q780_partition_evolution",
-    "q781_range_vs_rows_frames",
-    "q782_l_diversity",
-    "q783_kish_ess",
-    "q784_pip_degeneracies",
-    "q785_lww_semilattice",
-    "q786_consistent_cuts",
-    "q787_bloom_exact_fpp",
-    "q788_mvt_quantization",
-    "q789_geohash_seams",
-    "q790_threshold_algorithm",
-    "q791_scd2_intervals",
-    "q792_session_guarantees",
-    "q793_outer_join_pushdown",
-    "q794_check_digits",
-    "q795_gregorian_census",
-    "q796_line_line_relation",
-    "q797_curve_linearize_subdivided",
-    "q798_ntv2_gridshift",
-    "q799_ntv2_roundtrip",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -824,13 +32,16 @@ def main() -> None:
     # warm the JVM + parquet footers once
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
+    # every registered query except the streaming-ingest ones (qNN_stream_*)
+    headline = [n for n in QUERIES if "_stream_" not in n]
+
     # Two passes, keep the per-query MIN: this burst-throttled shared
     # VM swings 3-4× run-to-run (see BASELINE.md "Interpretation"), and
     # a single-shot timing conflates host stalls with engine cost — the
     # same warm-min protocol scalebench.py uses.
     times: dict[str, float] = {}
     for _pass in range(2):
-        for name in HEADLINE:
+        for name in headline:
             fn = QUERIES[name]
             t0 = time.time()
             df = fn(spark, sf_dir)
@@ -853,10 +64,8 @@ def main() -> None:
     # tail of stdout — round 1 recorded "parsed": null on the full dict):
     # qNN keys, 2-decimal times, scaling summarized to the decision
     # numbers; the full structures go to BENCH_DETAIL.json instead.
-    # the honest denominator (r4 verdict #4): operator-tier queries
-    # exercise gdal_spark/operators|kernels|functions|streaming|
-    # sources code; parity-tier are Column-plan / shared-SQL
-    # cross-engine checks
+    # the honest denominator: operator-tier queries run engine code,
+    # contract-tier ones pin the driver's correctness set
     from collections import Counter
 
     from gdal_spark.queries import query_kinds

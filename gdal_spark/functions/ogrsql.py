@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.functions.st import register_st_functions
@@ -38,6 +39,100 @@ _REWRITES = [
 ]
 
 
+# SQL tokens: literals and quoted identifiers stay opaque, so nothing
+# inside them is rewritten; whitespace is skipped by finditer.
+_TOKEN = re.compile(r"""
+    (?P<opaque>'(?:[^']|'')*'|"(?:[^"]|"")*"|`[^`]*`|--[^\n]*)
+  | (?P<word>[A-Za-z_][A-Za-z0-9_]*)
+  | (?P<open>\()
+  | (?P<close>\))
+  | (?P<comma>,)
+  | (?P<other>\S)
+""", re.X)
+
+# words that end a FROM/JOIN table reference instead of aliasing it
+_CLAUSE_WORDS = frozenset(
+    "WHERE JOIN LEFT RIGHT INNER OUTER FULL CROSS ON USING GROUP ORDER "
+    "HAVING LIMIT OFFSET UNION".split())
+
+
+def _from_layers(toks) -> list[tuple[str, str]]:
+    """(table, reference) for every name after FROM or JOIN, in order;
+    the reference is the alias when one is given.  ``toks`` holds
+    (kind, text) pairs."""
+    out = []
+    for i, (kind, text) in enumerate(toks[:-1]):
+        if kind != "word" or text.upper() not in ("FROM", "JOIN"):
+            continue
+        kind2, name = toks[i + 1]
+        if kind2 != "word":
+            continue  # a subquery
+        j = i + 2
+        if j < len(toks) and toks[j][1].upper() == "AS":
+            j += 1
+        ref = name
+        if (j < len(toks) and toks[j][0] == "word"
+                and toks[j][1].upper() not in _CLAUSE_WORDS):
+            ref = toks[j][1]
+        out.append((name, ref))
+    return out
+
+
+def _style_expr(spark: SparkSession, toks) -> str:
+    """OGR_STYLE resolves against the primary (first) FROM layer: its
+    ``style`` column when it has one, NULL otherwise.  The column is
+    qualified only when another FROM layer also has one."""
+    layers = []
+    for name, ref in _from_layers(toks):
+        try:
+            layers.append((ref, "style" in spark.table(name).columns))
+        except AnalysisException:  # not a table: EXTRACT(YEAR FROM col)
+            continue
+    if not layers or not layers[0][1]:
+        return "CAST(NULL AS STRING)"
+    if sum(styled for _, styled in layers) == 1:
+        return "style"
+    return f"{layers[0][0]}.style"
+
+
+def _rewrite_ogr_style(spark: SparkSession, sql: str) -> str:
+    """Replace the OGR_STYLE pseudo-column (ogr/ogr_p.h:168-175
+    SPF_OGR_STYLE; OGRFeature::GetStyleString) with the layer's style
+    expression.  A bare select-list item keeps the name OGR_STYLE in
+    the output schema, as in the reference; inside expressions
+    (``COALESCE(OGR_STYLE, 'x')``) it is substituted without an alias,
+    and string literals are never touched."""
+    matches = list(_TOKEN.finditer(sql))
+    toks = [(m.lastgroup, m.group()) for m in matches]
+    if ("word", "OGR_STYLE") not in [(k, t.upper()) for k, t in toks]:
+        return sql
+    expr = _style_expr(spark, toks)
+    out, last, depth = [], 0, 0
+    in_select = {}  # paren depth -> inside that level's SELECT list
+    for i, ((kind, text), m) in enumerate(zip(toks, matches)):
+        word = text.upper() if kind == "word" else None
+        if kind == "open":
+            depth += 1
+        elif kind == "close":
+            in_select.pop(depth, None)
+            depth -= 1
+        elif word in ("SELECT", "FROM"):
+            in_select[depth] = word == "SELECT"
+        elif word == "OGR_STYLE":
+            prev = toks[i - 1] if i else ("", "")
+            nxt = toks[i + 1] if i + 1 < len(toks) else ("close", "")
+            item = (in_select.get(depth, False)
+                    and (prev[0] == "comma"
+                         or prev[1].upper() in ("SELECT", "DISTINCT", "ALL"))
+                    and (nxt[0] in ("comma", "close")
+                         or nxt[1].upper() == "FROM"))
+            out += [sql[last:m.start()],
+                    f"{expr} AS OGR_STYLE" if item else expr]
+            last = m.end()
+    out.append(sql[last:])
+    return "".join(out)
+
+
 def execute_sql(
     spark: SparkSession, sql: str, layers: dict[str, DataFrame] | None = None
 ) -> DataFrame:
@@ -46,25 +141,7 @@ def execute_sql(
     register_st_functions(spark)
     for name, df in (layers or {}).items():
         df.createOrReplaceTempView(name)
-    # OGR_STYLE pseudo-column (ogr/ogr_p.h:168-175 SPF_OGR_STYLE;
-    # OGRFeature::GetStyleString): the layer's style string when the
-    # layer carries one, NULL otherwise — resolved against the
-    # registered layers, and aliased back to OGR_STYLE when it stands
-    # bare in a select list so the output schema matches the reference
-    style_expr = (
-        "style" if any("style" in df.columns
-                       for df in (layers or {}).values())
-        else "CAST(NULL AS STRING)")
-
-    def _style_sub(m):  # one pass — two chained subs would rewrite
-        # the alias the first one just inserted
-        tail = m.group(1) or ""
-        if tail:
-            return f"{style_expr} AS OGR_STYLE{tail}"
-        return style_expr
-
-    sql = re.sub(r"\bOGR_STYLE\b(\s*(?:,|FROM\b))?", _style_sub, sql,
-                 flags=re.I)
+    sql = _rewrite_ogr_style(spark, sql)
     for pat, repl in _REWRITES:
         sql = pat.sub(repl, sql)
     return spark.sql(sql)

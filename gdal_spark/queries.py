@@ -9,6 +9,12 @@ additions) appears here twice:
   parquet views (omitted only for genuinely non-SQL-expressible ops;
   those get rows-only checks)
 
+Each query carries a ``kind=`` tag: ``"operator"`` when it runs
+engine code, ``"contract"`` when it is plain Spark SQL kept because the
+driver's correctness set names it.  ``query_kinds()`` returns the tags.
+Spark-vs-DuckDB parity checks that run no engine code live outside the
+registry, in the repo root's ``parity_queries.py``.
+
 Determinism contract: every aliased column matches between the two;
 double aggregates are rounded identically on both sides; all synthetic
 spatial data derives from table keys with integer arithmetic so both
@@ -53,61 +59,28 @@ ORACLES: dict = {}
 KINDS: dict = {}
 
 
-def query(name: str, oracle: str | None = None,
-          kind: str | None = None):
+def query(name: str, oracle: str | None = None, *, kind: str):
+    """Register ``fn`` as query ``name``.  ``kind`` is ``"operator"``
+    when the query runs engine code (``gdal_spark`` operators, kernels,
+    functions, streaming, sources or plans), ``"contract"`` when it is
+    pure Spark SQL kept because the driver's correctness set names it."""
+    if kind not in ("operator", "contract"):
+        raise ValueError(
+            f"{name}: kind must be 'operator' or 'contract', not {kind!r}")
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        if kind is not None:
-            KINDS[name] = kind
+        KINDS[name] = kind
         return fn
 
     return deco
 
 
-_KIND_RE = re.compile(
-    r"from gdal_spark\.(operators|kernels|functions|streaming|sources)")
-
-
 def query_kinds() -> dict:
-    """kind per registered query (the r4 verdict's #4 — the honest
-    denominator): ``"operator"`` when the query exercises engine code
-    (``gdal_spark/operators|kernels|functions|streaming|sources``,
-    via a module import in its source or a helper imported from those
-    packages at module top), ``"parity"`` when it is a pure
-    Column-plan / shared-SQL cross-engine check.  Explicit
-    ``@query(kind=...)`` tags override the inference."""
-    import inspect
-    import sys
-
-    if getattr(query_kinds, "_cache", None):
-        return query_kinds._cache
-    mod = sys.modules[__name__]
-    helpers = {
-        n for n, v in vars(mod).items()
-        if getattr(v, "__module__", "").startswith((
-            "gdal_spark.operators", "gdal_spark.kernels",
-            "gdal_spark.functions", "gdal_spark.streaming",
-            "gdal_spark.sources"))
-        and not n.startswith("_")
-    }
-    pat = re.compile(
-        r"\b(" + "|".join(sorted(map(re.escape, helpers))) + r")\b"
-    ) if helpers else None
-    out = {}
-    for name, fn in QUERIES.items():
-        if name in KINDS:
-            out[name] = KINDS[name]
-            continue
-        try:
-            src = inspect.getsource(fn)
-        except OSError:
-            src = ""
-        op = bool(_KIND_RE.search(src)) or bool(pat and pat.search(src))
-        out[name] = "operator" if op else "parity"
-    query_kinds._cache = out
-    return out
+    """The ``kind=`` tag of every registered query."""
+    return dict(KINDS)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -169,6 +142,7 @@ def _rects(spark, sf_dir) -> list[tuple]:
     """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
        FROM lineitem
        WHERE l_quantity > 45 AND l_discount < 0.05 AND l_returnflag = 'R'""",
+    kind="contract",
 )
 def q01(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -184,6 +158,7 @@ def q01(spark, sf_dir):
        round(sum(l_quantity), 2) AS sum_qty, round(avg(l_quantity), 6) AS avg_qty,
        round(stddev_pop(l_quantity), 6) AS sd_pop, round(stddev_samp(l_quantity), 6) AS sd_samp
        FROM lineitem""",
+    kind="contract",
 )
 def q02(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -203,6 +178,7 @@ def q02(spark, sf_dir):
 @query(
     "q03_distinct",
     "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
+    kind="contract",
 )
 def q03(spark, sf_dir):
     return _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
@@ -212,6 +188,7 @@ def q03(spark, sf_dir):
     "q04_orderby_limit",
     """SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem
        ORDER BY l_orderkey, l_linenumber LIMIT 100""",
+    kind="contract",
 )
 def q04(spark, sf_dir):
     return (
@@ -233,6 +210,7 @@ def q04(spark, sf_dir):
        round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
        round(avg(l_discount), 6) AS avg_disc
        FROM lineitem GROUP BY l_returnflag, l_linestatus""",
+    kind="contract",
 )
 def q05(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
@@ -257,6 +235,7 @@ def q05(spark, sf_dir):
        FROM orders o LEFT JOIN (SELECT * FROM customer WHERE c_custkey % 3 <> 0) c
        ON o.o_custkey = c.c_custkey
        GROUP BY 1""",
+    kind="contract",
 )
 def q06(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -274,6 +253,7 @@ def q06(spark, sf_dir):
          UNION ALL
          SELECT 'lo' AS src, o_orderkey FROM orders WHERE o_totalprice < 50000
        ) GROUP BY src""",
+    kind="contract",
 )
 def q07(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -298,6 +278,7 @@ def q07(spark, sf_dir):
        (p_name LIKE '%gre%') AS has_gre,
        (p_brand ILIKE 'brand#1%') AS b1
        FROM part WHERE p_size BETWEEN 10 AND 30 AND p_partkey % 7 = 0""",
+    kind="contract",
 )
 def q08(spark, sf_dir):
     p = _t(spark, sf_dir, "part")
@@ -323,6 +304,7 @@ def q08(spark, sf_dir):
     """SELECT date_trunc('hour', ts) AS hour, event_type,
        count(*) AS n, round(sum(value), 2) AS sum_value
        FROM events GROUP BY 1, 2""",
+    kind="contract",
 )
 def q09(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
@@ -343,6 +325,7 @@ def q09(spark, sf_dir):
                       THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
               count(*) AS n_events
        FROM g GROUP BY user_id""",
+    kind="contract",
 )
 def q10(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
@@ -375,6 +358,7 @@ def q10(spark, sf_dir):
                       THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
               count(*) AS n_events
        FROM g GROUP BY user_id""",
+    kind="contract",
 )
 def q61(spark, sf_dir):
     """Sessionization via Spark's NATIVE session_window operator (the
@@ -403,6 +387,7 @@ def q61(spark, sf_dir):
        SELECT p.doc_id, r.zone_id FROM pts p JOIN rects r
        ON p.lon >= r.xmin AND p.lon <= r.xmax
        AND p.lat >= r.ymin AND p.lat <= r.ymax""",
+    kind="operator",
 )
 def q11(spark, sf_dir):
     pts = _points(spark, sf_dir)
@@ -425,6 +410,7 @@ def q11(spark, sf_dir):
        FROM pts p JOIN rects r
        ON p.lon >= r.xmin AND p.lon <= r.xmax AND p.lat >= r.ymin AND p.lat <= r.ymax
        GROUP BY r.zone_id""",
+    kind="operator",
 )
 def q12(spark, sf_dir):
     pts = _points(spark, sf_dir)
@@ -447,6 +433,7 @@ def q12(spark, sf_dir):
              FROM d)
        SELECT qid, doc_id, round(dist2, 6) AS dist2, CAST(knn_rank AS INT) AS knn_rank
        FROM r WHERE knn_rank <= 4""",
+    kind="operator",
 )
 def q13(spark, sf_dir):
     pts = _points(spark, sf_dir)
@@ -477,6 +464,7 @@ def q13(spark, sf_dir):
              FROM d WHERE dist2 <= 25.0)
        SELECT qid, doc_id, round(dist2, 6) AS dist2, CAST(knn_rank AS INT) AS knn_rank
        FROM r WHERE knn_rank <= 8""",
+    kind="operator",
 )
 def q59(spark, sf_dir):
     """kNN with the search-radius bound (GDALGridNearestNeighbor's
@@ -503,6 +491,7 @@ def q59(spark, sf_dir):
               CAST(floor((80-lat)/160.0*64) AS BIGINT) AS ty,
               count(*) AS n, round(sum(CAST(v AS DOUBLE)), 2) AS sum_v
        FROM pts GROUP BY 1, 2""",
+    kind="contract",
 )
 def q14(spark, sf_dir):
     pts = _points(spark, sf_dir)
@@ -525,6 +514,7 @@ def q14(spark, sf_dir):
        SELECT tx // 4 AS ptx, ty // 4 AS pty, CAST(sum(n) AS BIGINT) AS n,
               count(*) AS n_children
        FROM base GROUP BY 1, 2""",
+    kind="contract",
 )
 def q15(spark, sf_dir):
     base = QUERIES["q14_raster_density"](spark, sf_dir)
@@ -542,6 +532,7 @@ def q15(spark, sf_dir):
                 + CAST(floor((lon+180)/360.0*128) AS BIGINT)*268435456
                 + CAST(floor((90-lat)/180.0*128) AS BIGINT) AS cell
        FROM pts""",
+    kind="operator",
 )
 def q16(spark, sf_dir):
     pts = _points(spark, sf_dir)
@@ -593,6 +584,7 @@ def _q25_rect_rows(spark, sf_dir) -> list[tuple]:
                  AND gx.range <= floor(r.x1 + 0.5) - 1)
        SELECT gx, gy, CAST(sum(val) AS DOUBLE) AS v
        FROM pix GROUP BY gx, gy""",
+    kind="operator",
 )
 def q25(spark, sf_dir):
     """GDALRasterize scanline semantics (alg/llrasterize.cpp:41-226) on
@@ -643,6 +635,7 @@ def _q26_rect_rows(spark, sf_dir) -> list[tuple]:
               ((x0 + w - 1) // 32 - x0 // 32 + 1)
               * ((y0 + h - 1) // 32 - y0 // 32 + 1) AS n_tiles
        FROM r""",
+    kind="operator",
 )
 def q26(spark, sf_dir):
     """GDALPolygonize semantics (alg/polygonize.cpp:73-300) distributed:
@@ -692,6 +685,7 @@ def _q58_line_rows(spark, sf_dir) -> list[tuple]:
        allp AS (SELECT * FROM hp UNION ALL SELECT * FROM vp)
        SELECT gx, gy, CAST(sum(val) AS DOUBLE) AS v
        FROM allp GROUP BY gx, gy""",
+    kind="operator",
 )
 def q58(spark, sf_dir):
     """Line rasterization (GDALdllImageLine Bresenham semantics incl.
@@ -736,6 +730,7 @@ def _q25_tiles(spark, sf_dir):
        SELECT cgx AS gx, cgy AS gy, CAST(sum(v) AS DOUBLE) AS v
        FROM sh WHERE cgx BETWEEN 0 AND 127 AND cgy BETWEEN 0 AND 127
        GROUP BY cgx, cgy""",
+    kind="operator",
 )
 def q27(spark, sf_dir):
     """3×3 focal sum (gdal raster neighbors) with cross-tile halo
@@ -793,6 +788,7 @@ def _dem_tiles(spark):
               FROM g)
        SELECT gx, gy, round(100.0 * sqrt(p*p + q*q), 6) AS slope_pct
        FROM pq WHERE 100.0 * sqrt(p*p + q*q) <> 0""",
+    kind="operator",
 )
 def q28(spark, sf_dir):
     """gdaldem slope (Horn) over a synthetic DEM tile table; halo
@@ -824,6 +820,7 @@ def q28(spark, sf_dir):
        LEFT JOIN rast a10 ON a10.gx = b.gx0 + 1 AND a10.gy = b.gy0
        LEFT JOIN rast a01 ON a01.gx = b.gx0     AND a01.gy = b.gy0 + 1
        LEFT JOIN rast a11 ON a11.gx = b.gx0 + 1 AND a11.gy = b.gy0 + 1""",
+    kind="operator",
 )
 def q31(spark, sf_dir):
     """GDALInterpolateAtPoint bilinear: each query point cogroups with
@@ -876,6 +873,7 @@ def _b_rect_rows(spark, sf_dir) -> list[tuple]:
        FROM a JOIN b
        ON least(a.xmax, b.bx1) > greatest(a.xmin, b.bx0)
        AND least(a.ymax, b.by1) > greatest(a.ymin, b.by0)""",
+    kind="operator",
 )
 def q29(spark, sf_dir):
     """Layer-algebra Intersection (ogrlayer.cpp:5385): bbox broadcast
@@ -903,6 +901,7 @@ def q29(spark, sf_dir):
                              * CAST(power(2, 2*j.range) AS BIGINT)) AS BIGINT) AS morton
              FROM g, range(8) j GROUP BY doc_id)
        SELECT doc_id, morton FROM m ORDER BY morton, doc_id LIMIT 300""",
+    kind="operator",
 )
 def q30(spark, sf_dir):
     """Z-order spatial sort (gdal vector sort --hilbert's role): pure
@@ -947,6 +946,7 @@ def _docs_with_dups(spark, sf_dir) -> DataFrame:
     f"""WITH d AS ({DOCS_WITH_DUPS_SQL})
        SELECT {FP_SQL} AS fp, count(*) AS dup_count, min(doc_id) AS keeper
        FROM d GROUP BY 1 HAVING count(*) > 1""",
+    kind="operator",
 )
 def q17(spark, sf_dir):
     d = _docs_with_dups(spark, sf_dir)
@@ -985,6 +985,7 @@ def q17(spark, sf_dir):
               round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) AS jaccard
        FROM inter i JOIN sizes sa ON sa.doc_id = i.a JOIN sizes sb ON sb.doc_id = i.b
        WHERE round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) >= 0.5""",
+    kind="operator",
 )
 def q18(spark, sf_dir):
     d = _docs_with_dups(spark, sf_dir)
@@ -1009,6 +1010,7 @@ def q18(spark, sf_dir):
               round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) AS jaccard
        FROM inter i JOIN sizes sa ON sa.doc_id = i.a JOIN sizes sb ON sb.doc_id = i.b
        WHERE round(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6) >= 0.5""",
+    kind="operator",
 )
 def q19(spark, sf_dir):
     """N-gram Jaccard near-dup pairs WITH the df-cap ON (round-3
@@ -1040,6 +1042,7 @@ def q19(spark, sf_dir):
               CAST(SUM(CASE WHEN s > 0 THEN CAST(power(2, j) AS BIGINT) ELSE 0 END)
                    AS BIGINT) AS simhash
        FROM bits GROUP BY doc_id""",
+    kind="operator",
 )
 def q20(spark, sf_dir):
     return simhash(_t(spark, sf_dir, "documents"), bits=16)
@@ -1066,6 +1069,7 @@ def q20(spark, sf_dir):
               CAST(sum((xor(sa, sb) // CAST(power(2, j.range) AS BIGINT)) % 2) AS BIGINT) AS ham
               FROM p, range(16) j GROUP BY a, b, sa, sb)
        SELECT a, b, ham FROM hm WHERE ham <= 3""",
+    kind="operator",
 )
 def q60(spark, sf_dir):
     """SimHash near-dup pairs, Hamming ≤ 3 on the 16-bit signatures.
@@ -1088,6 +1092,7 @@ def q60(spark, sf_dir):
                    x -> x IN ('the','and','of','a'))) AS DOUBLE)
              / len(list_filter(string_split(text, ' '), x -> x <> '')), 6) AS stop_ratio
        FROM documents WHERE length(text) > 0""",
+    kind="operator",
 )
 def q21(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(F.length("text") > 0)
@@ -1119,6 +1124,7 @@ def q21(spark, sf_dir):
               ELSE 'fr' END AS lang_guess
          FROM scored)
        SELECT lang, lang_guess, count(*) AS n FROM lab GROUP BY 1, 2""",
+    kind="operator",
 )
 def q22(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -1136,6 +1142,7 @@ def q22(spark, sf_dir):
        CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_ws,
        CAST(len(list_distinct(regexp_extract_all(lower(text), '\w+'))) AS BIGINT) AS n_vocab
        FROM documents""",
+    kind="operator",
 )
 def q48(spark, sf_dir):
     """Token counting: whitespace + BPE-ish regex (word pieces +
@@ -1160,6 +1167,7 @@ def q48(spark, sf_dir):
              / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) AS cos
              FROM v a JOIN v b ON a.vec_id < b.vec_id)
        SELECT a, b, round(cos, 6) AS cosine FROM p WHERE cos >= 0.18""",
+    kind="operator",
 )
 def q49(spark, sf_dir):
     """Embedding-cosine near-dup pairs (threshold form of the dedup
@@ -1202,6 +1210,7 @@ def q49(spark, sf_dir):
              FROM scored)
        SELECT qid, vec_id, CAST(sim_rank AS INT) AS sim_rank, round(cosine, 6) AS cosine
        FROM r WHERE sim_rank <= 5""",
+    kind="operator",
 )
 def q23(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
@@ -1243,6 +1252,7 @@ def q23(spark, sf_dir):
              FROM scored)
        SELECT qid, vec_id, CAST(ivf_rank AS INT) AS ivf_rank, score
        FROM r WHERE ivf_rank <= 5""",
+    kind="operator",
 )
 def q32(spark, sf_dir):
     """IVF ANN: integer-quantized embeddings, formula centroids, probe
@@ -1265,6 +1275,7 @@ def q32(spark, sf_dir):
          UNION
          SELECT und.v, r.lab FROM reach r JOIN und ON und.u = r.node)
        SELECT node, min(lab) AS component FROM reach GROUP BY node""",
+    kind="operator",
 )
 def q33(spark, sf_dir):
     """GNM connected components (gnm/gnmgraph.h:211) as iterative label
@@ -1297,6 +1308,7 @@ def q33(spark, sf_dir):
               list_aggregate(fps, 'min') AS fp_min,
               CAST(list_aggregate(fps, 'sum') AS BIGINT) AS fp_sum
        FROM m""",
+    kind="operator",
 )
 def q34(spark, sf_dir):
     """Winnowing fingerprints (sliding-window min of k-gram hashes) —
@@ -1318,6 +1330,7 @@ def q34(spark, sf_dir):
        16 + (CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) // 64) % 64 AS height,
        round((CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 256) / 255.0, 6) AS mean_luma
        FROM documents""",
+    kind="operator",
 )
 def q35(spark, sf_dir):
     """Multimodal plumbing: binary content column → Arrow-batched
@@ -1340,6 +1353,7 @@ def q35(spark, sf_dir):
     """SELECT date_trunc('hour', ts) AS hour, event_type,
        count(*) AS n, round(sum(value), 2) AS sum_value
        FROM events GROUP BY 1, 2""",
+    kind="operator",
 )
 def q36(spark, sf_dir):
     """The q09 aggregation executed as a REAL Structured Streaming
@@ -1362,6 +1376,7 @@ def q36(spark, sf_dir):
                       THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
               count(*) AS n_events
        FROM g GROUP BY user_id""",
+    kind="operator",
 )
 def q50(spark, sf_dir):
     """q10's sessionization as a STATEFUL streaming operator
@@ -1379,6 +1394,7 @@ def q50(spark, sf_dir):
                        % ([7,11,13,17,19,23,29,31,37,41,43])[((gy*128 + gx)%11) + 1])
                    % 65536 AS BIGINT) AS checksum
        FROM rast""",
+    kind="operator",
 )
 def q37(spark, sf_dir):
     """GDALChecksumImage distributed: per-tile partial remainder sums
@@ -1401,6 +1417,7 @@ def q37(spark, sf_dir):
                          - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE))), 6)
                   AS stddev_pop
        FROM a""",
+    kind="operator",
 )
 def q38(spark, sf_dir):
     """Band statistics (ComputeStatistics): per-tile integer-exact
@@ -1415,6 +1432,7 @@ def q38(spark, sf_dir):
     f"""{Q25_PIX_SQL}
        SELECT CAST(v AS BIGINT) // 16 AS bucket, count(*) AS n
        FROM rast GROUP BY 1""",
+    kind="operator",
 )
 def q57(spark, sf_dir):
     """Band histogram (GetHistogram): per-tile bincount partials, one
@@ -1434,6 +1452,7 @@ def q57(spark, sf_dir):
               (CAST(zone_id AS VARCHAR) LIKE '1%') AS starts1
        FROM zones WHERE zone_id BETWEEN 2 AND 20 AND zone_id % 2 = 0
        ORDER BY area DESC, fid LIMIT 8""",
+    kind="operator",
 )
 def q39(spark, sf_dir):
     """ExecuteSQL veneer: OGR-SQL text (FID / OGR_GEOM_AREA pseudo-
@@ -1459,6 +1478,7 @@ def q39(spark, sf_dir):
     """SELECT CAST(regexp_extract(props, '"k": (\\d+)', 1) AS BIGINT) % 10 AS k_bucket,
               count(*) AS n, count(DISTINCT user_id) AS nd_user
        FROM events GROUP BY 1""",
+    kind="contract",
 )
 def q40(spark, sf_dir):
     """JSON/HSTORE property access (OGR's HSTORE_GET_VALUE + JSON field
@@ -1476,6 +1496,7 @@ def q40(spark, sf_dir):
     f"""WITH r AS ({Q26_RECTS_SQL})
        SELECT CAST(dn AS BIGINT) AS dn, w * h AS pixel_count
        FROM r WHERE w * h >= 20""",
+    kind="operator",
 )
 def q41(spark, sf_dir):
     """Sieve (GDALSieveFilter's CCL machinery, size-threshold subset):
@@ -1534,7 +1555,7 @@ FROM l WHERE case_id NOT IN (0, 15)
 """
 
 
-@query("q42_contour_cells", _CONTOUR_ORACLE)
+@query("q42_contour_cells", _CONTOUR_ORACLE, kind="operator")
 def q42(spark, sf_dir):
     """Marching-squares contour (gdal contour, alg/marching_squares):
     per-tile cell classification + crossing interpolation with halo
@@ -1589,6 +1610,7 @@ def _erase_rect_rows(spark, sf_dir) -> list[tuple]:
               round((a.xmax - a.xmin) * (a.ymax - a.ymin)
                     - coalesce(c.covered, 0), 6) AS erase_area
        FROM a LEFT JOIN cov c ON c.a_id = a.zone_id""",
+    kind="operator",
 )
 def q43(spark, sf_dir):
     """Layer-algebra Erase (area form): input area minus disjoint
@@ -1618,6 +1640,7 @@ def q43(spark, sf_dir):
                          - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE))), 6)
                   AS stddev_pop
        FROM a""",
+    kind="operator",
 )
 def q44(spark, sf_dir):
     """GDALZonalStats raster path: zone raster (burned rects) × value
@@ -1644,6 +1667,7 @@ def q44(spark, sf_dir):
              WHERE gx BETWEEN 0 AND 127 AND gy BETWEEN 0 AND 127
              GROUP BY gx, gy)
        SELECT gx, gy, round(sqrt(CAST(d2 AS DOUBLE)), 6) AS dist FROM m""",
+    kind="operator",
 )
 def q45(spark, sf_dir):
     """GDALComputeProximity with MAXDIST=8: bounding the distance
@@ -1680,6 +1704,7 @@ def q45(spark, sf_dir):
              FROM cand)
        SELECT qid, doc_id, round(dist2, 6) AS dist2, CAST(knn_rank AS INT) AS knn_rank
        FROM r WHERE knn_rank <= 4""",
+    kind="operator",
 )
 def q46(spark, sf_dir):
     """Large×large kNN via per-cell sorted neighbor rings (the north
@@ -1722,6 +1747,7 @@ DAG_EDGES_SQL = (
          UNION
          SELECT e.v, p.cost + e.w FROM paths p JOIN e ON e.u = p.node)
        SELECT node, min(cost) AS cost FROM paths GROUP BY node""",
+    kind="operator",
 )
 def q47(spark, sf_dir):
     """GNM single-source shortest paths (gnmgraph.h:173) as iterative
@@ -1777,6 +1803,7 @@ def _q51_rect_rows(spark, sf_dir) -> list[tuple]:
               CAST(2 * (w + h) AS DOUBLE) AS perim,
               CAST(w * h AS DOUBLE) AS parea
        FROM r""",
+    kind="operator",
 )
 def q51(spark, sf_dir):
     """Polygonize pass-2 geometry: CCL + boundary arc tracing emits the
@@ -1804,6 +1831,7 @@ def q51(spark, sf_dir):
               CAST(2 * (w + h) AS DOUBLE) AS perim,
               CAST(w * h AS DOUBLE) AS parea
        FROM r""",
+    kind="operator",
 )
 def q52(spark, sf_dir):
     """Full GDALPolygonize with CROSS-TILE dissolved geometry: the q26
@@ -1835,6 +1863,7 @@ def q52(spark, sf_dir):
                    + CASE WHEN r.v IS NOT NULL AND r.v <> 0 THEN 1 ELSE 0 END
                    AS DOUBLE) AS v
        FROM dem d LEFT JOIN rast r ON r.gx = d.gx AND r.gy = d.gy""",
+    kind="operator",
 )
 def q53(spark, sf_dir):
     """Raster band algebra (VRT pixel functions / gdal raster calc):
@@ -1942,7 +1971,7 @@ def _contour_seg_oracle(window: int = 48) -> str:
     FROM nseg s JOIN nend n USING (component)"""
 
 
-@query("q54_contour_polylines", _contour_seg_oracle(48))
+@query("q54_contour_polylines", _contour_seg_oracle(48), kind="operator")
 def q54(spark, sf_dir):
     """Iso-line ASSEMBLY: marching-squares segments connect on exact
     shared endpoints into polylines (distributed label propagation);
@@ -1973,6 +2002,7 @@ def q54(spark, sf_dir):
              ROW_NUMBER() OVER (PARTITION BY px, py ORDER BY c DESC, v) AS rn
              FROM cnt)
        SELECT px, py, CAST(v AS DOUBLE) AS mode_v FROM r WHERE rn = 1""",
+    kind="operator",
 )
 def q56(spark, sf_dir):
     """MODE overview resampling (GDALRegenerateOverviewsEx MODE,
@@ -2001,6 +2031,7 @@ def q56(spark, sf_dir):
               max(pv) - min(pv) AS m_range,
               round(avg(sqrt(d2)), 6) AS m_avg_dist
        FROM infr GROUP BY i, j""",
+    kind="operator",
 )
 def q55(spark, sf_dir):
     """GDALGrid data metrics (Count/Min/Max/Range/AverageDistance per
@@ -2034,6 +2065,7 @@ def q55(spark, sf_dir):
               CASE WHEN nhit > 0 THEN hitval ELSE round(wsum / wtot, 6) END AS idw,
               npts
        FROM agg""",
+    kind="operator",
 )
 def q24(spark, sf_dir):
     pts = _points(spark, sf_dir)
@@ -2078,6 +2110,7 @@ def _q62_stair_rows(spark, sf_dir) -> list[tuple]:
        SELECT CAST(c+1 AS BIGINT) AS dn, count(*) AS pixel_count,
               count(DISTINCT (gx//32)*1000 + gy//32) AS n_tiles
        FROM p GROUP BY c""",
+    kind="operator",
 )
 def q62(spark, sf_dir):
     """8-connected polygonize across tile borders (reference
@@ -2125,6 +2158,7 @@ def q62(spark, sf_dir):
               CAST((2*w + 2*h - 4)*1000000 + 4*707107 AS BIGINT) AS length_u,
               vsum_x, vsum_y
        FROM r JOIN v USING (k)""",
+    kind="operator",
 )
 def q63(spark, sf_dir):
     """Ordered contour polyline GEOMETRY (the reference's contour
@@ -2158,6 +2192,7 @@ def q63(spark, sf_dir):
                     row_number() OVER (PARTITION BY node ORDER BY cost) AS rk
              FROM (SELECT DISTINCT node, cost FROM paths))
        SELECT node, CAST(rk - 1 AS INT) AS rnk, cost FROM r WHERE rk <= 3""",
+    kind="operator",
 )
 def q64(spark, sf_dir):
     """GNM K-shortest-paths (gnmgraph.h:195, Yen) as the distributed
@@ -2183,6 +2218,7 @@ def q64(spark, sf_dir):
     f"""{Q25_PIX_SQL}
        SELECT gx//2 AS gx, gy//2 AS gy, v FROM rast
        WHERE gx%2 = 1 AND gy%2 = 1""",
+    kind="operator",
 )
 def q65(spark, sf_dir):
     """gdalwarp nearest-neighbour resample to a 2× coarser target grid
@@ -2216,6 +2252,7 @@ def q65(spark, sf_dir):
                0.75*0.75*z00 + 0.25*0.75*z10 + 0.75*0.25*z01 + 0.25*0.25*z11 AS v
              FROM s)
        SELECT gx, gy, v FROM o WHERE v <> 0""",
+    kind="operator",
 )
 def q66(spark, sf_dir):
     """gdalwarp BILINEAR to a quarter-pixel-shifted same-scale grid
@@ -2259,6 +2296,7 @@ def _q67_line_rows(spark, sf_dir) -> list[tuple]:
          UNION ALL
          SELECT k, a + 2*t.range + 1, b + t.range + 1 FROM L, range(8) t)
        SELECT gx, gy, CAST(k+1 AS DOUBLE) AS v FROM cells""",
+    kind="operator",
 )
 def q67(spark, sf_dir):
     """ALL_TOUCHED line burn (GDALdllImageLineAllTouched,
@@ -2316,6 +2354,7 @@ def _q68_rows(spark, sf_dir) -> list[tuple]:
                FROM p, range(3) i, range(3) j
                WHERE i.range < s AND j.range < s)
        SELECT gx, gy, v FROM big UNION ALL SELECT gx, gy, v FROM sat""",
+    kind="operator",
 )
 def q68(spark, sf_dir):
     """GDALSieveFilter MERGE semantics (alg/sievefilter.cpp): each
@@ -2341,6 +2380,7 @@ def q68(spark, sf_dir):
                     min((gx-tx)*(gx-tx) + (gy-ty)*(gy-ty)) AS d2
              FROM g, t GROUP BY gx, gy)
        SELECT gx, gy, round(sqrt(CAST(d2 AS DOUBLE)), 6) AS dist FROM d""",
+    kind="operator",
 )
 def q69(spark, sf_dir):
     """UNBOUNDED proximity (GDALComputeProximity without MAXDIST,
@@ -2375,6 +2415,7 @@ _DEM_G = "SELECT gx.range AS gx, gy.range AS gy FROM range(1, 127) gx, range(1, 
              sqrt(CAST({' + '.join(f'({z} - {_ZC})*({z} - {_ZC})' for z in _ZN)} AS DOUBLE)) AS tri
              FROM g)
        SELECT gx, gy, round(tri, 6) AS tri FROM m WHERE tri <> 0""",
+    kind="operator",
 )
 def q70(spark, sf_dir):
     """gdaldem TRI, Riley algorithm (apps/gdaldem_lib.cpp, the default
@@ -2393,6 +2434,7 @@ def q70(spark, sf_dir):
              CAST({_ZC} AS DOUBLE) - ({' + '.join(_ZN)}) / 8.0 AS tpi
              FROM g)
        SELECT gx, gy, round(tpi, 6) AS tpi FROM m WHERE tpi <> 0""",
+    kind="operator",
 )
 def q71(spark, sf_dir):
     """gdaldem TPI: center minus the 8-neighbor mean (exact /8)."""
@@ -2410,6 +2452,7 @@ def q71(spark, sf_dir):
                   - least({_ZC}, {', '.join(_ZN)}) AS DOUBLE) AS rough
              FROM g)
        SELECT gx, gy, rough FROM m WHERE rough <> 0""",
+    kind="operator",
 )
 def q72(spark, sf_dir):
     """gdaldem roughness: 3×3 max − min (exact integers)."""
@@ -2443,6 +2486,7 @@ _HS1, _HS2, _HS3 = _hs_consts()
        SELECT gx, gy,
               round(CASE WHEN c254 <= 0 THEN 1.0 ELSE 1.0 + c254 END, 6) AS shade
        FROM h""",
+    kind="operator",
 )
 def q73(spark, sf_dir):
     """gdaldem hillshade, Horn, az 315 / alt 45 (gdaldem_lib.cpp:
@@ -2477,6 +2521,7 @@ def q73(spark, sf_dir):
                ELSE 7 END AS octant
              FROM t)
        SELECT gx, gy, CAST(octant AS INT) AS octant FROM o""",
+    kind="operator",
 )
 def q74(spark, sf_dir):
     """gdaldem aspect as compass azimuth (gdaldem_lib.cpp:1441-1468):
@@ -2528,6 +2573,7 @@ def _ramp_chan_sql(v: str, ch: int) -> str:
               {_ramp_chan_sql('v', 1)} AS g,
               {_ramp_chan_sql('v', 2)} AS b
        FROM z""",
+    kind="operator",
 )
 def q75(spark, sf_dir):
     """gdaldem color-relief, linear interpolation
@@ -2608,6 +2654,7 @@ def _alg(spark, sf_dir, op):
        SELECT a_id, b_id, round(area, 6) AS area FROM
        (SELECT * FROM inter UNION ALL SELECT * FROM a_rem
         UNION ALL SELECT * FROM b_rem)""",
+    kind="operator",
 )
 def q76(spark, sf_dir):
     """OGRLayer::Union (ogrlayer.cpp:6188) piece areas: A∩B pieces +
@@ -2620,6 +2667,7 @@ def q76(spark, sf_dir):
     f"""WITH {_ALG_INTER_SQL}
        SELECT a_id, b_id, round(area, 6) AS area FROM
        (SELECT * FROM a_rem UNION ALL SELECT * FROM b_rem)""",
+    kind="operator",
 )
 def q77(spark, sf_dir):
     """OGRLayer::SymDifference (ogrlayer.cpp:6456): both remainders."""
@@ -2631,6 +2679,7 @@ def q77(spark, sf_dir):
     f"""WITH {_ALG_INTER_SQL}
        SELECT a_id, b_id, round(area, 6) AS area FROM
        (SELECT * FROM inter UNION ALL SELECT * FROM a_rem)""",
+    kind="operator",
 )
 def q78(spark, sf_dir):
     """OGRLayer::Identity (ogrlayer.cpp:6710): input split by method
@@ -2643,6 +2692,7 @@ def q78(spark, sf_dir):
     f"""WITH {_ALG_INTER_SQL}
        SELECT a_id, b_id, round(area, 6) AS area FROM
        (SELECT * FROM a_rem UNION ALL SELECT * FROM b_whole)""",
+    kind="operator",
 )
 def q79(spark, sf_dir):
     """OGRLayer::Update (ogrlayer.cpp:6986): A remainders + whole B."""
@@ -2654,6 +2704,7 @@ def q79(spark, sf_dir):
     f"""WITH {_ALG_INTER_SQL}
        SELECT a_id, round(sum(area), 6) AS clip_area
        FROM inter GROUP BY a_id""",
+    kind="operator",
 )
 def q80(spark, sf_dir):
     """OGRLayer::Clip (ogrlayer.cpp:7206): per input feature, its area
@@ -2683,6 +2734,7 @@ def _q81_rows(spark, sf_dir, shift_x, shift_y, dn_off):
        SELECT coalesce(p2.gx, p1.gx) AS gx, coalesce(p2.gy, p1.gy) AS gy,
               CAST(coalesce(p2.v, p1.v) AS DOUBLE) AS v
        FROM p1 FULL OUTER JOIN p2 ON p1.gx = p2.gx AND p1.gy = p2.gy""",
+    kind="operator",
 )
 def q81(spark, sf_dir):
     """gdal_merge / gdal raster mosaic, last-wins compositing
@@ -2710,6 +2762,7 @@ def q81(spark, sf_dir):
        SELECT gx - 10 AS gx, gy - 20 AS gy, least(v * 2.0, 256.0) AS v
        FROM rast
        WHERE gx >= 10 AND gx < 74 AND gy >= 20 AND gy < 68""",
+    kind="operator",
 )
 def q82(spark, sf_dir):
     """gdal_translate -srcwin 10 20 64 48 -scale 0 128 0 256
@@ -2732,6 +2785,7 @@ def q82(spark, sf_dir):
               CAST(2*(ceil(w/2.0) + ceil(h/2.0)) + 1 AS INT) AS n_pts,
               CAST(w*h AS DOUBLE) AS area
        FROM r""",
+    kind="operator",
 )
 def q83(spark, sf_dir):
     """OGRGeometry::segmentize (ogr/ogrgeometry curves densify): each
@@ -2772,6 +2826,7 @@ def q83(spark, sf_dir):
                 ELSE 'disjoint'
               END AS rel
        FROM a, b""",
+    kind="operator",
 )
 def q84(spark, sf_dir):
     """OGR binary predicates (ogrgeometry.cpp:575-6409) on the
@@ -2818,7 +2873,7 @@ def _q85_oracle() -> str:
     )
 
 
-@query("q85_warp_cubic", _q85_oracle())
+@query("q85_warp_cubic", _q85_oracle(), kind="operator")
 def q85(spark, sf_dir):
     """gdalwarp CUBIC (Keys convolution, A=−0.5 — the reference's
     GRA_Cubic, alg/gdalwarpkernel.cpp): quarter-pixel-shifted grid ⇒
@@ -2838,6 +2893,7 @@ def q85(spark, sf_dir):
     "q86_stream_dedup",
     """SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
        FROM events GROUP BY 1""",
+    kind="operator",
 )
 def q86(spark, sf_dir):
     """Streaming exact dedup under duplicate delivery: the same events
@@ -2886,6 +2942,7 @@ def _q87_cities_values() -> str:
              FROM g)
        SELECT cell7, count(*) AS n, count(DISTINCT cell9) AS n9
        FROM k GROUP BY cell7""",
+    kind="operator",
 )
 def q87(spark, sf_dir):
     """The FLAGSHIP geocode stage end-to-end with an exact oracle: the
@@ -2925,6 +2982,7 @@ def q87(spark, sf_dir):
               quantile_cont(v, 0.75) AS p75,
               quantile_cont(v, 0.98) AS p98
        FROM z""",
+    kind="operator",
 )
 def q88(spark, sf_dir):
     """Band EXACT percentiles (the reference's GetHistogram /
@@ -2962,6 +3020,7 @@ def q88(spark, sf_dir):
                FROM h WHERE s >= 1) b)
        SELECT doc_id, d AS hilbert FROM h WHERE s = 0
        ORDER BY hilbert, doc_id LIMIT 300""",
+    kind="operator",
 )
 def q89(spark, sf_dir):
     """Hilbert-curve spatial sort key (the reference's layer-sort /
@@ -3014,6 +3073,7 @@ def _q90_rows(spark, sf_dir) -> list[tuple]:
                     THEN CAST(w*h - (w-4)*(h-4) AS DOUBLE)
                     ELSE w*h - 0.5 END, 6) AS parea
        FROM r""",
+    kind="operator",
 )
 def q90(spark, sf_dir):
     """FILLED contour polygons (gdal contour -p,
@@ -3085,6 +3145,7 @@ def _q91_rows(spark, sf_dir) -> list[tuple]:
            FROM cand) WHERE rn = 1)
        SELECT gx, gy, v FROM valid
        UNION ALL SELECT gx, gy, v FROM filled""",
+    kind="operator",
 )
 def q91(spark, sf_dir):
     """GDALFillNodata surface (alg/fillnodata.cpp) with pinned
@@ -3103,62 +3164,6 @@ def q91(spark, sf_dir):
     return out.filter(F.col("v") != 999.0)
 
 
-@query(
-    "q92_stratified_sample",
-    """WITH d AS (SELECT doc_id, lang, n_chars,
-                    ((doc_id * 2654435761) % 4294967296) % 100 AS h
-                  FROM documents)
-       SELECT lang, count(*) AS n_kept, sum(n_chars) AS sum_chars
-       FROM d
-       WHERE h < CASE WHEN lang = 'en' THEN 10 ELSE 50 END
-       GROUP BY lang""",
-)
-def q92(spark, sf_dir):
-    """Stratified deterministic sampling (training-data splits):
-    per-language keep rates driven by a pure-arithmetic multiplicative
-    hash — no RNG state, any executor reproduces the sample, and the
-    SQL oracle is the identical predicate.  (Spark's sample() is
-    seed-dependent per partition — useless for cross-engine parity or
-    resumable pipelines.)"""
-    d = _t(spark, sf_dir, "documents")
-    h = ((F.col("doc_id") * 2654435761) % 4294967296) % 100
-    rate = F.when(F.col("lang") == "en", 10).otherwise(50)
-    return (
-        d.filter(h < rate)
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_kept"), F.sum("n_chars").alias("sum_chars"))
-    )
-
-
-@query(
-    "q93_sequence_packing",
-    """WITH d AS (SELECT doc_id, lang, n_chars,
-                    sum(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
-                                       ROWS UNBOUNDED PRECEDING) AS cum
-                  FROM documents)
-       SELECT lang, CAST((cum - n_chars) // 50000 AS BIGINT) AS bin,
-              count(*) AS n_docs, sum(n_chars) AS total_chars
-       FROM d GROUP BY lang, bin""",
-)
-def q93(spark, sf_dir):
-    """Sequence packing (context-window binning for training): greedy
-    cumulative-size bins per language stratum — bin = floor(running
-    size before the doc / capacity), one window pass; the exact shape
-    a packing stage feeds to a tokenizer fleet."""
-    d = _t(spark, sf_dir, "documents")
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum("n_chars").over(w)
-    return (
-        d.withColumn("bin", F.floor((cum - F.col("n_chars")) / 50000).cast("long"))
-        .groupBy("lang", "bin")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars"))
-    )
-
-
 _Q94_PAIRS = ORACLES["q18_minhash_lsh"]
 
 
@@ -3173,6 +3178,7 @@ _Q94_PAIRS = ORACLES["q18_minhash_lsh"]
          SELECT e.v, r.m FROM reach r JOIN e ON e.u = r.node)
        SELECT node AS doc_id, CAST(min(m) AS BIGINT) AS canonical
        FROM reach GROUP BY node""",
+    kind="operator",
 )
 def q94(spark, sf_dir):
     """Canonical-document selection — the full near-dup dedup pipeline
@@ -3193,6 +3199,7 @@ def q94(spark, sf_dir):
     "q95_warp_rotated",
     f"""{Q25_PIX_SQL}
        SELECT gy AS gx, gx AS gy, v FROM rast""",
+    kind="operator",
 )
 def q95(spark, sf_dir):
     """ROTATED-affine warp (gdalwarp with a rotated target grid —
@@ -3224,6 +3231,7 @@ def q95(spark, sf_dir):
        SELECT zone, CAST(variety AS BIGINT) AS variety,
               CAST(v AS BIGINT) AS mode_v, cnt AS mode_n
        FROM rk WHERE rn = 1""",
+    kind="operator",
 )
 def q96(spark, sf_dir):
     """Zonal MODE / VARIETY (the reference zonal-stats outputs beyond
@@ -3256,6 +3264,7 @@ def q96(spark, sf_dir):
               min(gx) AS xmin, min(gy) AS ymin, max(gx) AS xmax, max(gy) AS ymax,
               CAST(sum(v) AS DOUBLE) AS checksum_sum
        FROM rast GROUP BY tx, ty""",
+    kind="operator",
 )
 def q97(spark, sf_dir):
     """gdaltindex / manifest surface (apps/gdaltindex_lib.cpp; our
@@ -3317,6 +3326,7 @@ def _q98_rows(spark, sf_dir) -> list[tuple]:
        SELECT 1, CAST(2*(x0+2) - 1 AS BIGINT), CAST(2*(y0+2) AS BIGINT),
               1, round((w-4)*(h-4) - 0.5, 6)
        FROM r WHERE w >= 5 AND h >= 5""",
+    kind="operator",
 )
 def q98(spark, sf_dir):
     """MULTI-LEVEL contour bands (full gdal contour -p output): plateau
@@ -3372,6 +3382,7 @@ _VS_ZEYE = f"(({_z_sql('64', '64')}) + 2.0)"
                    ELSE ({_z_sql('t.px', 't.py')}) - {_VS_ZEYE}
                         >= coalesce(f.m, CAST('-infinity' AS DOUBLE)) END AS visible
        FROM t LEFT JOIN fin f ON f.px = t.px AND f.py = t.py""",
+    kind="operator",
 )
 def q99(spark, sf_dir):
     """VIEWSHED (gdal_viewshed, alg/viewshed/viewshed.cpp) with pinned
@@ -3410,6 +3421,7 @@ def q99(spark, sf_dir):
                       + CAST(floor((90-lat)/180.0*512) AS BIGINT) AS cell9
              FROM zz)
        SELECT zone_id, cell9, count(*) AS n FROM k GROUP BY zone_id, cell9""",
+    kind="operator",
 )
 def q100(spark, sf_dir):
     """The NORTH-STAR pipeline end-to-end as ONE oracle-checked query:
@@ -3467,6 +3479,7 @@ def q100(spark, sf_dir):
                          + bit_count(xor(x.sig_lo, y.sig_lo)) AS BIGINT) AS ham
              FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id)
        SELECT a, b, ham FROM p WHERE ham <= 3""",
+    kind="operator",
 )
 def q101(spark, sf_dir):
     """64-bit SimHash near-dup pairs — the scale-safe candidate
@@ -3540,12 +3553,12 @@ def _conv_query(method: str):
     return fn
 
 
-query("q102_pyramid_bilinear", _conv_oracle_sql("bilinear"))(_conv_query("bilinear"))
-query("q103_pyramid_cubic", _conv_oracle_sql("cubic"))(_conv_query("cubic"))
-query("q104_pyramid_cubicspline", _conv_oracle_sql("cubicspline"))(
+query("q102_pyramid_bilinear", _conv_oracle_sql("bilinear"), kind="operator")(_conv_query("bilinear"))
+query("q103_pyramid_cubic", _conv_oracle_sql("cubic"), kind="operator")(_conv_query("cubic"))
+query("q104_pyramid_cubicspline", _conv_oracle_sql("cubicspline"), kind="operator")(
     _conv_query("cubicspline")
 )
-query("q105_pyramid_lanczos", _conv_oracle_sql("lanczos"))(_conv_query("lanczos"))
+query("q105_pyramid_lanczos", _conv_oracle_sql("lanczos"), kind="operator")(_conv_query("lanczos"))
 
 
 _GAUSS_TERMS = " + ".join(
@@ -3561,6 +3574,7 @@ _GAUSS_TERMS = " + ".join(
                    FROM range(64) px, range(64) py)
        SELECT px, py, round(({_GAUSS_TERMS}) / 16.0, 6) AS v FROM g
        WHERE px <= 62 AND py <= 62""",
+    kind="operator",
 )
 def q106(spark, sf_dir):
     """GAUSS overview: 3×3 [1 2 1; 2 4 2; 1 2 1] kernel anchored at the
@@ -3584,6 +3598,7 @@ def q106(spark, sf_dir):
                     + ({_z_sql('2*px', '2*py+1')})*({_z_sql('2*px', '2*py+1')})
                     + ({_z_sql('2*px+1', '2*py+1')})*({_z_sql('2*px+1', '2*py+1')})) / 4.0), 6) AS v
        FROM par""",
+    kind="operator",
 )
 def q107(spark, sf_dir):
     """RMS overview (GDALResampleChunk_AverageOrRMS<true>, float path):
@@ -3625,6 +3640,7 @@ def q107(spark, sf_dir):
        e AS (SELECT n, sqrt((px-cx)*(px-cx) + (py-cy)*(py-cy)) AS dist
              FROM (SELECT n, px, py, ax + tt*dx AS cx, ay + tt*dy AS cy FROM t))
        SELECT n, round(min(dist), 6) AS dist FROM e GROUP BY n""",
+    kind="operator",
 )
 def q108(spark, sf_dir):
     """ST_Distance point → polyline: min over the 9 segment distances
@@ -3679,6 +3695,7 @@ def q108(spark, sf_dir):
        SELECT n, round(CAST(sx AS DOUBLE) / (3.0*CAST(ss AS DOUBLE)), 6) AS cx,
               round(CAST(sy AS DOUBLE) / (3.0*CAST(ss AS DOUBLE)), 6) AS cy
        FROM s""",
+    kind="operator",
 )
 def q109(spark, sf_dir):
     """ST_Centroid of integer-vertex L-shaped (concave) polygons: the
@@ -3730,6 +3747,7 @@ def q109(spark, sf_dir):
              AND (b.x-a.x)*(c.y-a.y) - (b.y-a.y)*(c.x-a.x) <= 0))
        SELECT g, CAST(x AS DOUBLE) AS hx, CAST(y AS DOUBLE) AS hy
        FROM hullv""",
+    kind="operator",
 )
 def q110(spark, sf_dir):
     """ST_ConvexHull (monotone chain) over 5 groups of 40 integer
@@ -3803,6 +3821,7 @@ _Q111_TOL = 6.0
        kept AS (SELECT DISTINCT n, i FROM
                 (SELECT n, i FROM iv UNION ALL SELECT n, j AS i FROM iv))
        SELECT k.n, v.x, v.y FROM kept k JOIN v ON v.n = k.n AND v.i = k.i""",
+    kind="operator",
 )
 def q111(spark, sf_dir):
     """ST_Simplify: Douglas–Peucker with segment distance, keep when
@@ -3920,6 +3939,7 @@ def _overlay_general(spark, op):
     "q112_overlay_general_intersection",
     f"""WITH {_STAIR_SQL}
        SELECT a_id, b_id, round(s, 6) AS area FROM inter WHERE s > 0""",
+    kind="operator",
 )
 def q112(spark, sf_dir):
     """Concave ∩ concave via the GH traversal; oracle = Σ rect-pair
@@ -3932,6 +3952,7 @@ def q112(spark, sf_dir):
     f"""WITH {_STAIR_SQL}
        SELECT i.a_id, i.b_id, round(area_a + area_b - s, 6) AS area
        FROM inter i JOIN areas USING (a_id) JOIN areab USING (b_id)""",
+    kind="operator",
 )
 def q113(spark, sf_dir):
     """Concave ∪ concave (incl. disjoint two-ring and hole-nesting
@@ -3945,6 +3966,7 @@ def q113(spark, sf_dir):
     f"""WITH {_STAIR_SQL}
        SELECT i.a_id, i.b_id, round(area_a - s, 6) AS area
        FROM inter i JOIN areas USING (a_id)""",
+    kind="operator",
 )
 def q114(spark, sf_dir):
     """Concave A − B (multi-piece results when B splits A)."""
@@ -3956,6 +3978,7 @@ def q114(spark, sf_dir):
     f"""WITH {_STAIR_SQL}
        SELECT i.a_id, i.b_id, round(area_a + area_b - 2*s, 6) AS area
        FROM inter i JOIN areas USING (a_id) JOIN areab USING (b_id)""",
+    kind="operator",
 )
 def q115(spark, sf_dir):
     """Concave symmetric difference = (A−B) ⊎ (B−A), two traversals."""
@@ -4021,6 +4044,7 @@ def _zone_tiles_q116(spark, sf_dir):
        SELECT zone, CAST(v AS BIGINT) AS minority_v, cnt AS minority_n,
               round(cnt / CAST(total AS DOUBLE), 6) AS minority_frac
        FROM rk WHERE rn = 1""",
+    kind="operator",
 )
 def q116(spark, sf_dir):
     """Zonal MINORITY (least frequent value, ties → smallest) and its
@@ -4065,6 +4089,7 @@ def q116(spark, sf_dir):
                     - (swv / CAST(sw AS DOUBLE)) * (swv / CAST(sw AS DOUBLE))), 6)
                   AS wstdev
        FROM a""",
+    kind="operator",
 )
 def q117(spark, sf_dir):
     """Zonal WEIGHTED_SUM/MEAN/VARIANCE/STDEV with a weight raster —
@@ -4096,6 +4121,7 @@ def q117(spark, sf_dir):
               mx.gx + 0.5 AS max_cx, mx.gy + 0.5 AS max_cy
        FROM mn JOIN mx ON mx.zone = mn.zone AND mx.rn = 1
        WHERE mn.rn = 1""",
+    kind="operator",
 )
 def q118(spark, sf_dir):
     """Zonal MIN/MAX_CENTER_X/Y: cell-center coords of the extreme
@@ -4155,6 +4181,7 @@ def q118(spark, sf_dir):
        SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
               round(l1*z1 + l2*z2 + l3*z3, 6) AS linear_v
        FROM pick WHERE rnk = 1""",
+    kind="operator",
 )
 def q119(spark, sf_dir):
     """GDALGridLinear: Delaunay TIN + barycentric interpolation.  The
@@ -4201,6 +4228,7 @@ def q119(spark, sf_dir):
               CASE WHEN nhit > 0 THEN hitval ELSE round(nom / den, 6) END AS idw
        FROM agg
        WHERE nhit > 0 OR (nq0 >= 1 AND nq1 >= 1 AND nq2 >= 1 AND nq3 >= 1)""",
+    kind="operator",
 )
 def q120(spark, sf_dir):
     """Per-quadrant IDW-NN (alg/gdalgrid.cpp:351-470): each quadrant
@@ -4234,6 +4262,7 @@ def q120(spark, sf_dir):
             CAST(floor((CAST((n_nationkey*67)%360 AS DOUBLE) - 180.0 + 0.31 + 180.0) / 6.0)
                  % 60 + 1 AS INT) AS zone
        FROM nation""",
+    kind="operator",
 )
 def q121(spark, sf_dir):
     """WGS84 → UTM → WGS84 round trip over all zones/hemispheres; the
@@ -4267,6 +4296,7 @@ def q121(spark, sf_dir):
             CAST((n_nationkey*59)%140 AS DOUBLE) - 125.0 + 0.23 AS lon,
             CAST((n_nationkey*31)%45 AS DOUBLE) + 25.0 + 0.11 AS lat
        FROM nation""",
+    kind="operator",
 )
 def q122(spark, sf_dir):
     """WGS84 → Lambert conformal conic (CONUS Albers-style parallels
@@ -4298,6 +4328,7 @@ def q122(spark, sf_dir):
                    WHEN s = area_a THEN 'within'
                    ELSE 'overlaps' END AS rel
        FROM rel""",
+    kind="operator",
 )
 def q123(spark, sf_dir):
     """General-polygon binary predicates (concave staircases, general
@@ -4318,6 +4349,7 @@ def q123(spark, sf_dir):
        SELECT p.doc_id, r.zone_id FROM pts p JOIN rects r
        ON p.lon >= r.xmin AND p.lon <= r.xmax
        AND p.lat >= r.ymin AND p.lat <= r.ymax""",
+    kind="operator",
 )
 def q124(spark, sf_dir):
     """The spatial join with a DATAFRAME polygon side: the cell cover
@@ -4369,6 +4401,7 @@ def q124(spark, sf_dir):
               CAST(SUM((n*7 + i*i*3) % 41) AS DOUBLE) AS z_sum,
               CAST(SUM((n*11 + i*13) % 97) AS DOUBLE) AS m_sum
        FROM t GROUP BY n""",
+    kind="operator",
 )
 def q125(spark, sf_dir):
     """ISO LineString ZM parse: per-nation chains with integer-derived
@@ -4402,6 +4435,7 @@ def q125(spark, sf_dir):
             CAST(5 AS INT) AS npts,
             CAST(2 * (1 + n_nationkey % 4) * (1 + n_nationkey % 4) AS DOUBLE) AS area
        FROM nation""",
+    kind="operator",
 )
 def q126(spark, sf_dir):
     """CurvePolygon with a full-circle CircularString ring (radius
@@ -4497,6 +4531,7 @@ _KMEANS_CTE = """
               CAST(list_sum(c2.c) AS BIGINT) AS centroid_sum
        FROM a2 JOIN c2 USING (cell)
        GROUP BY a2.cell, c2.c""",
+    kind="operator",
 )
 def q127(spark, sf_dir):
     """Trained IVF coarse quantizer: integer-exact Lloyd k-means over
@@ -4538,6 +4573,7 @@ def q127(spark, sf_dir):
              FROM scored)
        SELECT qid, vec_id, CAST(ivf_rank AS INT) AS ivf_rank, score
        FROM r WHERE ivf_rank <= 5""",
+    kind="operator",
 )
 def q128(spark, sf_dir):
     """ANN over the LEARNED codebook: probe the 2 nearest trained
@@ -4563,6 +4599,7 @@ def q128(spark, sf_dir):
              CAST(min(p) AS BIGINT) AS pix_min,
              CAST(max(p) AS BIGINT) AS pix_max
       FROM px GROUP BY doc_id""",
+    kind="operator",
 )
 def q129(spark, sf_dir):
     """Multimodal resize plumbing: deterministic fake decode →
@@ -4589,6 +4626,7 @@ def q129(spark, sf_dir):
             FROM n CROSS JOIN range(128) g
             WHERE g.range < n_frames AND g.range % 16 = 0)
       SELECT doc_id, frame_idx, CAST(luma_int AS BIGINT) AS luma_int FROM f""",
+    kind="operator",
 )
 def q130(spark, sf_dir):
     """Video frame-sampling plumbing: one row per every-16th frame of
@@ -4646,6 +4684,7 @@ def q130(spark, sf_dir):
          FROM piv)
        SELECT gx, gy, round(v, 6) AS v FROM valid
        UNION ALL SELECT gx, gy, v FROM filled""",
+    kind="operator",
 )
 def q131(spark, sf_dir):
     """GDALFillNodata's DEFAULT directional-IDW interpolation
@@ -4673,6 +4712,7 @@ def q131(spark, sf_dir):
                    ELSE w*h + 2*(w + h)*2 + 8 END AS DOUBLE) AS area,
               CAST(CASE WHEN style = 'square' THEN 5 ELSE 9 END AS INT) AS npts
        FROM dims CROSS JOIN s""",
+    kind="operator",
 )
 def q132(spark, sf_dir):
     """GEOS-free Buffer (OGRGeometry::Buffer surface,
@@ -4720,6 +4760,7 @@ def q132(spark, sf_dir):
                   '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
                   '&#39;', ''''), '&amp;', '&')) AS n_chars_extracted
        FROM strip""",
+    kind="operator",
 )
 def q133(spark, sf_dir):
     """HTML -> text extraction with the pinned spec (tag strip + pinned
@@ -4783,6 +4824,7 @@ def q133(spark, sf_dir):
                               WHEN 1 THEN ms1*factor
                               ELSE ms2*factor END, 6) AS val
        FROM f, (VALUES (0), (1), (2)) b(band)""",
+    kind="operator",
 )
 def q134(spark, sf_dir):
     """Weighted-Brovey pan-sharpening
@@ -4842,6 +4884,7 @@ def q134(spark, sf_dir):
        SELECT gx, gy, v FROM w
        WHERE (gy >= 2 AND gy < 18 AND gx >= 2 AND gx < 44)
           OR (gy >= 18 AND gy < 44 AND gx >= 2 AND gx < 22)""",
+    kind="operator",
 )
 def q135(spark, sf_dir):
     """gdalwarp -cutline (GDALWarpCutlineMaskerEx,
@@ -4874,6 +4917,7 @@ def q135(spark, sf_dir):
                   AS tin_area,
               12 AS tin_npatches, 48 AS tin_npts
        FROM nation""",
+    kind="operator",
 )
 def q136(spark, sf_dir):
     """PolyhedralSurface Z and TIN Z types (ogr_core.h:441-447,
@@ -4942,6 +4986,7 @@ def q136(spark, sf_dir):
               round(CAST((3 + n_nationkey % 9) * (2 + n_nationkey % 7) AS DOUBLE), 6)
                   AS a_diff
        FROM nation""",
+    kind="operator",
 )
 def q137(spark, sf_dir):
     """Degenerate (shared-edge) general overlay — the GH kernel's
@@ -5058,6 +5103,7 @@ def _pq_cte(p: str, lo: int, hi: int, k: int, dims: int) -> str:
        JOIN p1a2 b USING (vec_id)
        JOIN p0adc x ON x.cell = a.cell
        JOIN p1adc y ON y.cell = b.cell""",
+    kind="operator",
 )
 def q138(spark, sf_dir):
     """Product quantization over the embeddings table (Jégou et al.
@@ -5115,6 +5161,7 @@ def q138(spark, sf_dir):
        FROM exact5 e LEFT JOIN ivf5 i
          ON i.qid = e.qid AND i.vec_id = e.vec_id
        GROUP BY e.qid""",
+    kind="operator",
 )
 def q139(spark, sf_dir):
     """ANN quality measurement: recall@5 of the trained-IVF search
@@ -5171,6 +5218,7 @@ def q139(spark, sf_dir):
               CAST(sum(e) AS BIGINT) AS total_energy,
               CAST(max(e) AS BIGINT) AS max_frame_energy
        FROM fe GROUP BY doc_id, n""",
+    kind="operator",
 )
 def q140(spark, sf_dir):
     """Audio-modality plumbing: deterministic fake decode → 64-sample
@@ -5192,6 +5240,7 @@ def q140(spark, sf_dir):
               round(CAST((4 + n_nationkey % 9) * (4 + n_nationkey % 7) AS DOUBLE)
                     / 2.0, 6) AS valid_area
        FROM nation""",
+    kind="operator",
 )
 def q141(spark, sf_dir):
     """ST_MakeValid for self-crossing rings (OGRGeometry::MakeValid,
@@ -5262,6 +5311,7 @@ def q141(spark, sf_dir):
                       + CAST(floor((90-lat)/180.0*512) AS BIGINT) AS cell
              FROM g)
        SELECT cell, count(*) AS n FROM k GROUP BY cell""",
+    kind="operator",
 )
 def q142(spark, sf_dir):
     """The north-star ingest pipeline as REAL Structured Streaming:
@@ -5298,6 +5348,7 @@ def _lsh_bucket_sql() -> str:
        b AS (SELECT vec_id, CAST({{expr}} AS BIGINT) AS bucket FROM v)
        SELECT bucket, count(*) AS n, CAST(min(vec_id) AS BIGINT) AS min_id
        FROM b GROUP BY bucket""".replace("{expr}", _lsh_bucket_sql()),
+    kind="operator",
 )
 def q143(spark, sf_dir):
     """Hyperplane-LSH bucketing on the exact integer lattice (closes
@@ -5323,6 +5374,7 @@ def q143(spark, sf_dir):
                ON gx >= x0 AND gx < x0 + w AND gy >= y0 AND gy < y0 + h)
        SELECT gx, gy, CAST(7 AS DOUBLE) AS v
        FROM g ANTI JOIN cov USING (gx, gy)""",
+    kind="operator",
 )
 def q144(spark, sf_dir):
     """gdal_rasterize -i (inverse burn): value 7 into every pixel NO
@@ -5362,6 +5414,7 @@ def q144(spark, sf_dir):
                 FROM hsh GROUP BY hash_hi, hash_lo)
        SELECT h.doc_id, h.hash_hi, h.hash_lo, k.keeper, CAST(k.n_dups AS BIGINT) AS n_dups
        FROM hsh h JOIN keep k USING (hash_hi, hash_lo)""",
+    kind="operator",
 )
 def q145(spark, sf_dir):
     """Image near-dup via perceptual aHash (the web-pipeline image
@@ -5408,6 +5461,7 @@ def q145(spark, sf_dir):
               CAST(sum(n_tok) AS BIGINT) AS total_tokens,
               CAST(sum(n_char) AS BIGINT) AS total_chars
        FROM packed GROUP BY lang, bin""",
+    kind="operator",
 )
 def q146(spark, sf_dir):
     """The LLM training-data pipeline END-TO-END as one plan: quality
@@ -5462,6 +5516,7 @@ def q146(spark, sf_dir):
        s AS (SELECT t - 2 AS t, y, x, v FROM a WHERE t >= 2 AND t < 6),
        r AS (SELECT y, x, avg(v) AS v FROM s GROUP BY y, x)
        SELECT x AS i0, y AS i1, round(v, 6) AS v FROM r""",
+    kind="operator",
 )
 def q147(spark, sf_dir):
     """MDArray API (gcore/gdalmultidim.cpp — GetView :3181, Transpose
@@ -5525,6 +5580,7 @@ def q147(spark, sf_dir):
                     row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rn
              FROM scored)
        WHERE rn <= 5""",
+    kind="operator",
 )
 def q148(spark, sf_dir):
     """PQ SERVING (completes the IndexPQ surface): top-5 ADC search
@@ -5607,6 +5663,7 @@ def q148(spark, sf_dir):
                   AS ident_inter,
               CAST(0.0 AS DOUBLE) AS wound2_valid
        FROM nation""",
+    kind="operator",
 )
 def q149(spark, sf_dir):
     """EXACT arrangement noding (upgrades the GH perturbation path to
@@ -5803,9 +5860,7 @@ def _wang_oracle_sql() -> str:
     return sql
 
 
-
-
-@query("q150_viewshed_wang", _wang_oracle_sql())
+@query("q150_viewshed_wang", _wang_oracle_sql(), kind="operator")
 def q150(spark, sf_dir):
     """Wang-EXACT viewshed parity (closes the last NOTES gap): the
     reference's default algorithm (ViewshedExecutor Edge mode,
@@ -5943,6 +5998,7 @@ def _checksum_rows(df, geom_col="geom", keep=("fid",)):
               CAST({_vsum2(["2*ty", "2*ty", "2*(ty+h+h2)", "2*(ty+h+h2)"])} AS BIGINT) AS vsum_y,
               round(CAST(w*(h+h2) AS DOUBLE), 6) AS r_area
        FROM f""",
+    kind="operator",
 )
 def q151(spark, sf_dir):
     """Layer-algebra Intersection emitting FEATURES (ogrlayer.cpp:5385)
@@ -5981,6 +6037,7 @@ def q151(spark, sf_dir):
                             "2*(ty+h+h2)", "2*(ty+h+h2)"])} AS BIGINT) AS vsum_y,
               round(CAST((w+w3+w4)*h + w*h2 AS DOUBLE), 6) AS r_area
        FROM f""",
+    kind="operator",
 )
 def q152(spark, sf_dir):
     """Geometry Union across a SHARED EDGE (ogrlayer.cpp:6188 →
@@ -6027,6 +6084,7 @@ def q152(spark, sf_dir):
               CAST({_vsum2(["2*(ty+1)", "2*(ty+2)", "2*(ty+2)", "2*(ty+1)"])} AS BIGINT) AS vsum_y,
               CAST(-1.0 AS DOUBLE) AS r_area
        FROM f""",
+    kind="operator",
 )
 def q153(spark, sf_dir):
     """Layer-algebra Difference emitting a polygon WITH A HOLE
@@ -6072,6 +6130,7 @@ def q153(spark, sf_dir):
                             "2*(ty+h)-1"])} AS BIGINT) AS vsum_y,
               round(CAST(h-1 AS DOUBLE), 6) AS r_area
        FROM f""",
+    kind="operator",
 )
 def q154(spark, sf_dir):
     """Geometry SymDifference with CHECKERBOARD PINCHES
@@ -6124,6 +6183,7 @@ def q154(spark, sf_dir):
               CAST({_vsum2(["2*(ty+bb)", "2*ty", "2*(ty+bb)"])} AS BIGINT) AS vsum_y,
               round(CAST(bb*bb AS DOUBLE)/2, 6) AS r_area
        FROM f""",
+    kind="operator",
 )
 def q155(spark, sf_dir):
     """ST_MakeValid on INTERLEAVED self-crossings (ogrgeometry.cpp:
@@ -6159,6 +6219,7 @@ def q155(spark, sf_dir):
               round(CAST((w+w3+1)*(h+1) + (w+1)*(h2+1) - (w+1) AS DOUBLE), 6)
                   AS r_area
        FROM f""",
+    kind="operator",
 )
 def q156(spark, sf_dir):
     """TRUE CONCAVE ST_Buffer (ogrgeometry.cpp:4949), GEOS-free: the
@@ -6221,7 +6282,7 @@ def _warp_lanczos_oracle() -> str:
     )
 
 
-@query("q157_warp_lanczos", _warp_lanczos_oracle())
+@query("q157_warp_lanczos", _warp_lanczos_oracle(), kind="operator")
 def q157(spark, sf_dir):
     """gdalwarp LANCZOS (GWKLanczosSinc radius 3, tap sum normalized —
     GWKResample's accumulator division) on a 2× upsample: dst sample
@@ -6255,6 +6316,7 @@ _WARP_DOWN_SRC = (
        o AS (SELECT sx//2 AS gx, sy//2 AS gy, SUM(z)/4.0 AS v
              FROM s GROUP BY sx//2, sy//2)
        SELECT gx, gy, round(v, 6) AS v FROM o WHERE v <> 0""",
+    kind="operator",
 )
 def q158(spark, sf_dir):
     """gdalwarp AVERAGE (GWKAverageOrMode GRA_Average): mean of the
@@ -6281,6 +6343,7 @@ def q158(spark, sf_dir):
                                        ORDER BY n DESC, z ASC) AS rk
              FROM c)
        SELECT gx, gy, round(z, 6) AS v FROM m WHERE rk = 1 AND z <> 0""",
+    kind="operator",
 )
 def q159(spark, sf_dir):
     """gdalwarp MODE (GRA_Mode): most frequent footprint value, ties
@@ -6302,6 +6365,7 @@ def q159(spark, sf_dir):
        o AS (SELECT sx//2 AS gx, sy//2 AS gy, sqrt(SUM(z*z)/4.0) AS v
              FROM s GROUP BY sx//2, sy//2)
        SELECT gx, gy, round(v, 6) AS v FROM o WHERE v <> 0""",
+    kind="operator",
 )
 def q160(spark, sf_dir):
     """gdalwarp RMS (GRA_RMS, alg/gdalwarpkernel.cpp GWKAverageOrMode
@@ -6380,6 +6444,7 @@ _GEO_ROWS = _geodesic_oracle_rows()
         f"(CAST({k} AS BIGINT), CAST('{v!r}' AS DOUBLE))" for k, v, _a in _GEO_ROWS
     )
     + ") AS t(fid, length_m)",
+    kind="operator",
 )
 def q161(spark, sf_dir):
     """Geodesic LENGTH (meters, WGS84) of a meridian+parallel-chord
@@ -6409,6 +6474,7 @@ def q161(spark, sf_dir):
         f"(CAST({k} AS BIGINT), CAST('{a!r}' AS DOUBLE))" for k, _v, a in _GEO_ROWS
     )
     + ") AS t(fid, area_m2)",
+    kind="operator",
 )
 def q162(spark, sf_dir):
     """Geodesic AREA (m², WGS84) of an edge-densified lat-lon box per
@@ -6454,6 +6520,7 @@ def q162(spark, sf_dir):
               (SUM(count) OVER (ORDER BY value))/tot AS cum_pct,
               CAST(row_number() OVER (ORDER BY value) AS INT) AS rnk
        FROM c, t""",
+    kind="operator",
 )
 def q163(spark, sf_dir):
     """Raster Attribute Table (gcore/gdal_rat.cpp:
@@ -6479,6 +6546,7 @@ def q163(spark, sf_dir):
              FROM g),
        p AS (SELECT gx, gy, ra*rb - ia*ib AS re, ra*ib + ia*rb AS im FROM z)
        SELECT gx, gy, re, im FROM p WHERE re <> 0 OR im <> 0""",
+    kind="operator",
 )
 def q164(spark, sf_dir):
     """COMPLEX pixel types (gcore/gdal.h:49-66 GDT_CFloat32) with the
@@ -6588,6 +6656,7 @@ def _url_raw_col():
        SELECT canon AS canon_url, CAST(min(doc_id) AS BIGINT) AS keeper_id,
               CAST(count(*) AS BIGINT) AS n_dups
        FROM c GROUP BY canon HAVING count(*) > 1""",
+    kind="operator",
 )
 def q165(spark, sf_dir):
     """URL canonicalization + exact dedup — the normalization a
@@ -6626,6 +6695,7 @@ def q165(spark, sf_dir):
                  ELSE 1 END AS ok FROM w)
        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_benchmark_hits
        FROM hits, guard GROUP BY doc_id""",
+    kind="operator",
 )
 def q166(spark, sf_dir):
     """Benchmark CONTAMINATION screening (the n-gram-overlap
@@ -6654,50 +6724,6 @@ def q166(spark, sf_dir):
     )
     hits = grams.join(F.broadcast(bench), "gram").select("doc_id", "gram").distinct()
     return hits.groupBy("doc_id").agg(F.count("*").alias("n_benchmark_hits"))
-
-
-@query(
-    "q167_repetition_stats",
-    """WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-       chunks AS (SELECT doc_id,
-                         array_to_string(words[(r.range-1)*2+1:r.range*2], ' ') AS chunk
-                  FROM w, range(1, 600) r
-                  WHERE (r.range-1)*2 + 1 <= len(words)),
-       s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-                    CAST(count(DISTINCT chunk) AS BIGINT) AS n_distinct
-             FROM chunks GROUP BY doc_id),
-       guard AS (SELECT CASE WHEN max(len(words)) > 2*599 THEN
-                   error('q167 oracle range(1,600) bound exceeded by fixture')
-                 ELSE 1 END AS ok FROM w)
-       SELECT doc_id, n_chunks, n_distinct,
-              CAST(n_chunks - n_distinct AS BIGINT) AS n_repeated
-       FROM s, guard WHERE n_chunks - n_distinct > 0""",
-)
-def q167(spark, sf_dir):
-    """Intra-document REPETITION measurement (the C4/Dolma repeated-
-    paragraph signal): texts chunk into fixed 2-word windows; repeated
-    chunks within one document are counted — the gate a quality filter
-    thresholds on.  JVM transform/slice chunking + per-doc distinct
-    aggregation; word-salad fixtures repeat chunks often enough to
-    exercise the path."""
-    docs = _t(spark, sf_dir, "documents")
-    chunks = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, CAST(ceil(size(split(text, ' '))/2.0) AS INT) - 1), "
-                "i -> array_join(slice(split(text, ' '), i*2 + 1, 2), ' '))"
-            )
-        ).alias("chunk"),
-    )
-    s = chunks.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks"),
-        F.countDistinct("chunk").alias("n_distinct"),
-    )
-    return s.select(
-        "doc_id", "n_chunks", "n_distinct",
-        (F.col("n_chunks") - F.col("n_distinct")).alias("n_repeated"),
-    ).filter(F.col("n_repeated") > 0)
 
 
 # --- cumulative viewshed (q168) ----------------------------------------------
@@ -6838,7 +6864,7 @@ def _cumulative_viewshed_oracle() -> str:
     )
 
 
-@query("q168_cumulative_viewshed", _cumulative_viewshed_oracle())
+@query("q168_cumulative_viewshed", _cumulative_viewshed_oracle(), kind="operator")
 def q168(spark, sf_dir):
     """CUMULATIVE viewshed — the reference's observer-MATRIX mode
     (alg/viewshed/cumulative.cpp: one Wang-executor run per observer,
@@ -6897,6 +6923,7 @@ def _warp_shear(spark, method):
     f"""{_WARP_SHEAR_JOIN},
        o AS (SELECT gx, gy, SUM(z)/count(*) AS v FROM j GROUP BY gx, gy)
        SELECT gx, gy, round(v, 6) AS v FROM o WHERE v <> 0""",
+    kind="operator",
 )
 def q169(spark, sf_dir):
     """gdalwarp AVERAGE under a SHEARED dst geotransform: mean of the
@@ -6915,6 +6942,7 @@ def q169(spark, sf_dir):
                                        ORDER BY n DESC, z ASC) AS rk
              FROM c)
        SELECT gx, gy, round(z, 6) AS v FROM m WHERE rk = 1 AND z <> 0""",
+    kind="operator",
 )
 def q170(spark, sf_dir):
     """gdalwarp MODE under a sheared geotransform — most frequent
@@ -6928,6 +6956,7 @@ def q170(spark, sf_dir):
     f"""{_WARP_SHEAR_JOIN},
        o AS (SELECT gx, gy, sqrt(SUM(z*z)/count(*)) AS v FROM j GROUP BY gx, gy)
        SELECT gx, gy, round(v, 6) AS v FROM o WHERE v <> 0""",
+    kind="operator",
 )
 def q171(spark, sf_dir):
     """gdalwarp RMS under a sheared geotransform — sqrt of the
@@ -6967,6 +6996,7 @@ def _antipodal_oracle_rows():
         for k, v in _antipodal_oracle_rows()
     )
     + ") AS t(fid, length_m)",
+    kind="operator",
 )
 def q172(spark, sf_dir):
     """Geodesic length across the NEAR-ANTIPODAL band (round-3 verdict
@@ -7014,6 +7044,7 @@ _HELMERT_ED50ISH = (
             CAST((n_nationkey*41)%160 AS DOUBLE) - 80.0 + 0.17 AS lat,
             CAST((n_nationkey*13)%500 AS DOUBLE) AS h
        FROM nation""",
+    kind="operator",
 )
 def q173(spark, sf_dir):
     """WGS84 → ECEF → 7-param Helmert (ED50-magnitude params) → exact
@@ -7044,13 +7075,13 @@ def q173(spark, sf_dir):
     )
 
 
-
 @query(
     "q174_albers_roundtrip",
     """SELECT n_nationkey AS n,
             CAST((n_nationkey*59)%140 AS DOUBLE) - 125.0 + 0.23 AS lon,
             CAST((n_nationkey*31)%45 AS DOUBLE) + 25.0 + 0.11 AS lat
        FROM nation""",
+    kind="operator",
 )
 def q174(spark, sf_dir):
     """WGS84 → Albers equal-area conic (CONUS 29.5/45.5) → WGS84 round
@@ -7089,6 +7120,7 @@ def q174(spark, sf_dir):
                             (CAST(3 AS INT), CAST(2 AS INT), 'hole'),
                             (CAST(4 AS INT), CAST(-1 AS INT), 'shell'))
                  AS r(ring_id, parent, role)""",
+    kind="operator",
 )
 def q175(spark, sf_dir):
     """OGRGeometryFactory::organizePolygons METHOD=DEFAULT
@@ -7173,6 +7205,7 @@ _WRAP_F = """f AS (SELECT CAST(n_nationkey AS BIGINT) AS fid,
               round(CAST((lon0+w-180) * h AS DOUBLE), 6) AS r_area
          FROM f WHERE lon0 + w > 180)
        SELECT * FROM west UNION ALL SELECT * FROM east""",
+    kind="operator",
 )
 def q176(spark, sf_dir):
     """Antimeridian WRAPDATELINE split (transformWithOptions,
@@ -7199,185 +7232,6 @@ def q176(spark, sf_dir):
     return _checksum_rows(res)
 
 
-@query(
-    "q177_hstore_get_value",
-    """SELECT doc_id,
-              'c' || CAST(doc_id%5 AS VARCHAR) AS color,
-              's' || CAST(doc_id%3 AS VARCHAR) AS size
-       FROM documents WHERE doc_id%2 = 0""",
-)
-def q177(spark, sf_dir):
-    """HSTORE_GET_VALUE (OGR SQL special op, ogr/ogr_swq.h:42-81 +
-    swq_op_general.cpp) — the reference parses 'k=>v,k=>v' tag strings;
-    Spark-side this is the built-in str_to_map (JVM, no UDF).  The
-    engine PARSES the constructed tag string; the oracle replays the
-    value formulas."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
-    tagged = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("color=>c"), (F.col("doc_id") % 5).cast("string"),
-            F.lit(",size=>s"), (F.col("doc_id") % 3).cast("string"),
-        ).alias("tags"),
-    )
-    m = F.expr("str_to_map(tags, ',', '=>')")
-    return tagged.select(
-        "doc_id", m.getItem("color").alias("color"), m.getItem("size").alias("size")
-    )
-
-
-# --- text retrieval scoring: TF-IDF + BM25 (q178-q179) ----------------------
-# Training-data curation needs corpus-statistics scoring (quality
-# weighting, retrieval-based filtering).  Both use the RATIONAL idf
-# variant (N/df instead of ln(N/df)) so every compared value is exact
-# integer arithmetic in doubles — the repo's no-raw-transcendentals
-# oracle invariant; the ln form differs only by a monotone transform,
-# so rankings are identical where df differs.
-
-
-@query(
-    "q178_tfidf_top_term",
-    """WITH toks AS (SELECT doc_id,
-                unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-            FROM documents),
-       tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-              FROM toks GROUP BY doc_id, tok),
-       df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-              FROM toks GROUP BY tok),
-       nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n FROM toks),
-       sc AS (SELECT t.doc_id, t.tok, t.tf, d.df,
-                     CAST(t.tf AS DOUBLE) * n / d.df AS score
-              FROM tf t JOIN df d ON t.tok = d.tok, nd),
-       rk AS (SELECT doc_id, tok, tf, df, score,
-                     row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY score DESC, tok ASC) AS rnk
-              FROM sc)
-       SELECT doc_id, tok AS top_term, tf, df, round(score, 6) AS score
-       FROM rk WHERE rnk = 1""",
-)
-def q178(spark, sf_dir):
-    """TF-IDF with rational idf (score = tf·N/df): per-document top
-    term, ties to the lexicographically smallest.  Plan: one tokenize
-    + two aggregations + a broadcast of the tiny (N) scalar; the df
-    table joins on token — at corpus scale both aggregations are
-    map-side-combinable and the join key (token) is the natural
-    partition; no all-pairs anywhere."""
-    docs = _t(spark, sf_dir, "documents")
-    # the token table feeds THREE aggregations (tf, df, N) — persist it
-    # once (at 10^12 docs this is one tokenize pass instead of three)
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("tok"),
-    ).persist()
-    tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    df = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
-    nd = toks.select(F.countDistinct("doc_id").alias("n"))
-    sc = (
-        tf.join(df, "tok")
-        .join(F.broadcast(nd))
-        .withColumn("score", F.col("tf").cast("double") * F.col("n") / F.col("df"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("tok"))
-    return (
-        sc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select(
-            "doc_id", F.col("tok").alias("top_term"), "tf", "df",
-            F.round("score", 6).alias("score"),
-        )
-    )
-
-
-@query(
-    "q179_bm25",
-    """WITH toks AS (SELECT doc_id,
-                unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS tok
-            FROM documents),
-       dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-              FROM toks GROUP BY doc_id),
-       stats AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                        CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-       q(tok) AS (VALUES ('spark'), ('vector'), ('merge')),
-       tf AS (SELECT t.doc_id, t.tok, CAST(count(*) AS BIGINT) AS tf
-              FROM toks t JOIN q ON t.tok = q.tok GROUP BY t.doc_id, t.tok),
-       df AS (SELECT tok, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-              FROM toks GROUP BY tok),
-       terms AS (SELECT f.doc_id, f.tok,
-                 (CAST(s.n AS DOUBLE) / d.df)
-                 * (CAST(f.tf AS DOUBLE) * (1.2 + 1.0))
-                 / (CAST(f.tf AS DOUBLE)
-                    + 1.2 * (1.0 - 0.75 + 0.75 * (CAST(l.dl AS DOUBLE) / s.avgdl)))
-                 AS term_score
-                 FROM tf f JOIN df d ON f.tok = d.tok
-                 JOIN dl l ON l.doc_id = f.doc_id, stats s),
-       piv AS (SELECT doc_id,
-                 max(CASE WHEN tok = 'spark' THEN term_score END) AS s1,
-                 max(CASE WHEN tok = 'vector' THEN term_score END) AS s2,
-                 max(CASE WHEN tok = 'merge' THEN term_score END) AS s3
-               FROM terms GROUP BY doc_id)
-       SELECT doc_id,
-              round(coalesce(s1, 0.0) + coalesce(s2, 0.0) + coalesce(s3, 0.0), 6)
-                  AS bm25
-       FROM piv""",
-)
-def q179(spark, sf_dir):
-    """BM25 (k1 = 1.2, b = 0.75, rational idf N/df) of the 3-term
-    query {spark, vector, merge} against every document.  The query
-    side is a broadcast 3-row table; dl/avgdl are one aggregation;
-    per-term scores mirror the oracle's expression tree TERM FOR TERM
-    (exact-integer inputs → bitwise doubles).  The per-doc total is a
-    FIXED-ORDER pivot sum (max-per-term then s1+s2+s3 left to right) —
-    a float SUM over an unordered group would be engine-order-
-    dependent in the last ulp (round-3 invariant)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.expr("filter(split(text, ' '), x -> x <> '')")).alias("tok"),
-    )
-    dl = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = dl.agg(
-        F.count("*").alias("n"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    qterms = local_df(
-        docs.sparkSession, [("spark",), ("vector",), ("merge",)], "tok string"
-    )
-    tf = (
-        toks.join(F.broadcast(qterms), "tok")
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("tf"))
-    )
-    df = toks.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
-    terms = (
-        tf.join(df, "tok")
-        .join(dl, "doc_id")
-        .join(F.broadcast(stats))
-        .withColumn(
-            "term_score",
-            (F.col("n").cast("double") / F.col("df"))
-            * (F.col("tf").cast("double") * (1.2 + 1.0))
-            / (
-                F.col("tf").cast("double")
-                + 1.2 * (1.0 - 0.75 + 0.75 * (F.col("dl").cast("double") / F.col("avgdl")))
-            ),
-        )
-    )
-    piv = terms.groupBy("doc_id").agg(
-        F.max(F.when(F.col("tok") == "spark", F.col("term_score"))).alias("s1"),
-        F.max(F.when(F.col("tok") == "vector", F.col("term_score"))).alias("s2"),
-        F.max(F.when(F.col("tok") == "merge", F.col("term_score"))).alias("s3"),
-    )
-    return piv.select(
-        "doc_id",
-        F.round(
-            F.coalesce(F.col("s1"), F.lit(0.0))
-            + F.coalesce(F.col("s2"), F.lit(0.0))
-            + F.coalesce(F.col("s3"), F.lit(0.0)),
-            6,
-        ).alias("bm25"),
-    )
-
-
 # --- streaming MinHash-LSH near-dup bucketing (q180) -------------------------
 
 
@@ -7401,6 +7255,7 @@ def _q180_sig_sql(j: int) -> str:
        SELECT band, bucket, CAST(min(doc_id) AS BIGINT) AS keeper_id,
               CAST(count(*) AS BIGINT) AS n_docs
        FROM b GROUP BY band, bucket""",
+    kind="operator",
 )
 def q180(spark, sf_dir):
     """STREAMING MinHash-LSH near-dup bucketing: near-dup redeliveries
@@ -7430,6 +7285,7 @@ _USHAPE_F = """f AS (SELECT CAST(n_nationkey AS BIGINT) AS fid,
                     ELSE wv - CAST(b AS DOUBLE)/2 END, 6) AS px,
               round(CAST(hv AS DOUBLE)/2, 6) AS py
        FROM f""",
+    kind="operator",
 )
 def q181(spark, sf_dir):
     """ST_PointOnSurface (OGRGeometry::PointOnSurface → GEOS
@@ -7477,6 +7333,7 @@ _CHAIN_F = """f AS (SELECT CAST(n_nationkey AS BIGINT) AS gid, r.i,
        SELECT s.gid, CAST(1 AS INT) AS n_polys,
               round(CAST(s.raw - o.ov AS DOUBLE), 6) AS union_area
        FROM s JOIN o ON s.gid = o.gid""",
+    kind="operator",
 )
 def q182(spark, sf_dir):
     """UnionCascaded (ogrgeometry.cpp:5553): per-group union of an
@@ -7510,6 +7367,7 @@ def q182(spark, sf_dir):
               CASE n_nationkey%3 WHEN 0 THEN 'MULTIPOINT'
                    WHEN 1 THEN 'MULTILINESTRING' ELSE 'MULTIPOLYGON' END AS type_after
        FROM nation""",
+    kind="operator",
 )
 def q183(spark, sf_dir):
     """forceToMulti* coercion ladder (OGRGeometryFactory forceTo*,
@@ -7578,6 +7436,7 @@ def q183(spark, sf_dir):
        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
               CAST(sum(n_tokens) AS BIGINT) AS total_tokens
        FROM clean GROUP BY lang""",
+    kind="operator",
 )
 def q184(spark, sf_dir):
     """End-to-end CURATION pipeline v2 — the round-4 web-side ops
@@ -7624,6 +7483,7 @@ def q184(spark, sf_dir):
                    WHEN 1 THEN 'touches'
                    WHEN 2 THEN 'overlaps' ELSE 'disjoint' END AS rel
        FROM nation""",
+    kind="operator",
 )
 def q185(spark, sf_dir):
     """General-polygon TOUCHES (zero-area boundary contact —
@@ -7659,6 +7519,7 @@ def q185(spark, sf_dir):
                    WHEN 1 THEN 'within'
                    WHEN 2 THEN 'touches' ELSE 'disjoint' END AS rel
        FROM nation""",
+    kind="operator",
 )
 def q186(spark, sf_dir):
     """LINESTRING vs POLYGON predicates (OGRGeometry::Crosses et al):
@@ -7684,298 +7545,6 @@ def q186(spark, sf_dir):
     layer = local_df(spark, rows, "fid long, gl binary, gp binary").repartition(8)
     return layer.select(
         "fid", st_line_relation(F.col("gl"), F.col("gp")).alias("rel")
-    )
-
-
-# --- corpus-statistics quality + host-level accounting (q187-q188) -----------
-
-
-@query(
-    "q187_rare_ngram_ratio",
-    """WITH idx AS (SELECT doc_id, text,
-                      unnest(range(1, greatest(length(text) - 1, 2))) AS i
-                 FROM documents),
-       occ AS (SELECT doc_id, substr(text, CAST(i AS INT), 3) AS gram FROM idx
-               WHERE length(substr(text, CAST(i AS INT), 3)) = 3),
-       cf AS (SELECT gram, CAST(count(*) AS BIGINT) AS corpus_n
-              FROM occ GROUP BY gram),
-       j AS (SELECT o.doc_id,
-                    CASE WHEN cf.corpus_n < 100 THEN 1 ELSE 0 END AS rare
-             FROM occ o JOIN cf ON o.gram = cf.gram)
-       SELECT doc_id,
-              CAST(count(*) AS BIGINT) AS n_grams,
-              CAST(sum(rare) AS BIGINT) AS n_rare,
-              round(CAST(sum(rare) AS DOUBLE) / count(*), 6) AS rare_ratio
-       FROM j GROUP BY doc_id""",
-)
-def q187(spark, sf_dir):
-    """Rare-n-gram quality ratio (the KenLM-perplexity stand-in a
-    CCNet-style filter thresholds, made exact-rational: fraction of a
-    document's char-3-gram OCCURRENCES whose corpus frequency is
-    below 100).  Two map-side-combinable aggregations + one equi-join
-    on gram — the corpus-frequency table is the only shuffled side,
-    bounded by the gram vocabulary, not the corpus."""
-    docs = _t(spark, sf_dir, "documents")
-    occ = docs.select(
-        "doc_id",
-        F.explode(F.expr(
-            "filter(transform(sequence(1, greatest(length(text) - 2, 1)), "
-            "i -> substring(text, i, 3)), s -> length(s) = 3)"
-        )).alias("gram"),
-    ).persist()  # feeds the corpus-frequency agg AND the join side
-    cf = occ.groupBy("gram").agg(F.count("*").alias("corpus_n"))
-    j = occ.join(cf, "gram").withColumn(
-        "rare", F.when(F.col("corpus_n") < 100, 1).otherwise(0)
-    )
-    return j.groupBy("doc_id").agg(
-        F.count("*").alias("n_grams"),
-        F.sum("rare").alias("n_rare"),
-        F.round(F.sum("rare").cast("double") / F.count("*"), 6).alias("rare_ratio"),
-    )
-
-
-@query(
-    "q188_host_stats",
-    f"""WITH d AS (SELECT doc_id, n_chars, {_URL_RAW_SQL} AS url FROM documents),
-       h AS (SELECT doc_id, n_chars,
-                    regexp_replace(lower(regexp_extract(url,
-                        '^https?://([^/?#]+)', 1)), '^www\\.', '') AS host
-             FROM d)
-       SELECT host, CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(n_chars) AS BIGINT) AS total_chars,
-              CAST(min(doc_id) AS BIGINT) AS first_doc
-       FROM h GROUP BY host""",
-)
-def q188(spark, sf_dir):
-    """Host-level corpus accounting (the CCNet/Dolma per-domain filter
-    input): host extracted from the URL (lowercased, www-stripped),
-    per-host doc count / char mass / first id.  One regexp projection
-    + one aggregation — the natural partition key for per-domain
-    policies at crawl scale."""
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _url_raw_col())
-    h = docs.select(
-        "doc_id", "n_chars",
-        F.regexp_replace(
-            F.lower(F.regexp_extract(F.col("url"), "^https?://([^/?#]+)", 1)),
-            "^www\\.", "",
-        ).alias("host"),
-    )
-    return h.groupBy("host").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.min("doc_id").alias("first_doc"),
-    )
-
-
-# --- exact-substring cross-doc dedup signal (q189) ---------------------------
-
-
-@query(
-    "q189_repeated_spans",
-    """WITH idx AS (SELECT doc_id, text,
-                      unnest(range(1, greatest(length(text) - 18, 2))) AS i
-                 FROM documents),
-       g AS (SELECT doc_id, CAST(i AS INT) AS pos,
-                    substr(text, CAST(i AS INT), 20) AS gram FROM idx
-             WHERE length(substr(text, CAST(i AS INT), 20)) = 20),
-       shared AS (SELECT gram FROM g GROUP BY gram
-                  HAVING count(DISTINCT doc_id) >= 2),
-       hits AS (SELECT doc_id, pos FROM g JOIN shared USING (gram)),
-       runs AS (SELECT doc_id, pos,
-                       CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                                                      ORDER BY pos) = 1
-                            THEN 0 ELSE 1 END AS is_start
-                FROM hits)
-       SELECT doc_id,
-              CAST(count(*) AS BIGINT) AS n_positions,
-              CAST(sum(is_start) AS BIGINT) AS n_spans
-       FROM runs GROUP BY doc_id""",
-)
-def q189(spark, sf_dir):
-    """EXACT-SUBSTRING cross-document duplication signal (the
-    suffix-array dedup of Lee et al. 2022, re-expressed bucketed: a
-    position is 'repeated' iff its 20-char gram occurs in ≥ 2 distinct
-    documents; adjacent repeated positions merge into maximal SPANS
-    via a lag window).  Shuffle shape: one groupBy(gram) bounded by
-    the gram vocabulary + one per-doc window — never doc×doc; at
-    10^12 docs the gram table shards by hash exactly like the
-    fingerprint dedup."""
-    docs = _t(spark, sf_dir, "documents")
-    g = docs.select(
-        "doc_id",
-        F.explode(F.expr(
-            "filter(transform(sequence(1, greatest(length(text) - 19, 1)), "
-            "i -> struct(i AS pos, substring(text, i, 20) AS gram)), "
-            "s -> length(s.gram) = 20)"
-        )).alias("pg"),
-    ).select(
-        "doc_id", F.col("pg.pos").cast("int").alias("pos"),
-        F.col("pg.gram").alias("gram"),
-    ).persist()  # feeds the shared-gram agg AND the hit join
-    shared = (
-        g.groupBy("gram")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gram")
-    )
-    hits = g.join(shared, "gram").select("doc_id", "pos")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    runs = hits.withColumn(
-        "is_start",
-        F.when(F.col("pos") - F.lag("pos").over(w) == 1, 0).otherwise(1),
-    )
-    return runs.groupBy("doc_id").agg(
-        F.count("*").alias("n_positions"),
-        F.sum("is_start").alias("n_spans"),
-    )
-
-# --- host link-graph PageRank, exact integer arithmetic (q190) ----------------
-
-_PR_ITERS = 4  # R_4; growth bound T_4 ≈ 5.2e8 per graph — far inside BIGINT
-
-
-@query(
-    "q190_host_pagerank",
-    """WITH hosts AS (SELECT DISTINCT doc_id % 40 AS host FROM documents),
-       edges AS (SELECT host AS src, (host + 1) % 40 AS dst FROM hosts
-                 UNION ALL SELECT host, (host * 2 + 7) % 40 FROM hosts
-                 UNION ALL SELECT host, (host * 3 + 11) % 40 FROM hosts),
-       r0 AS (SELECT host, CAST(1 AS BIGINT) AS r FROM hosts),
-       r1 AS (SELECT h.host,
-                     CAST(9 + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r0 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       r2 AS (SELECT h.host,
-                     CAST(9 * 60 + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r1 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       r3 AS (SELECT h.host,
-                     CAST(9 * 3600 + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r2 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       r4 AS (SELECT h.host,
-                     CAST(9 * 216000 + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r3 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       n AS (SELECT count(*) AS n FROM hosts)
-       SELECT r4.host AS host, r4.r AS rank_scaled,
-              CAST(r4.r AS DOUBLE) / CAST(n.n * 12960000 AS DOUBLE) AS pr
-       FROM r4, n""",
-)
-def q190(spark, sf_dir):
-    """PageRank over the per-host link graph (damping 0.85, 4
-    iterations) in EXACT INTEGER arithmetic, so the result is
-    order-free across engines.  With uniform out-degree 3 the scaled
-    recurrence is  R_{t+1}(v) = 9*60^t + 17 * sum_{u->v} R_t(u)
-    (scale N*60^t: teleport 0.15/N -> 9*60^t, damped transfer
-    0.85*r/3 -> 17*R/60; N cancels).  Each iteration is one equi-join
-    on src + one map-side-combinable BIGINT sum grouped by dst — the
-    standard crawl-graph centrality shape (reference analogue: GNM
-    connectivity trees, gnm/gnmgraph.cpp; the web-curation use is
-    per-domain authority weighting).  At 10^12 pages the host graph
-    is ~10^8 rows: every stage shuffles on host, nothing is
-    per-document after the initial distinct."""
-    docs = _t(spark, sf_dir, "documents")
-    hosts = docs.select((F.col("doc_id") % 40).alias("host")).distinct()
-    edges = hosts.select(
-        F.col("host").alias("src"),
-        F.explode(F.array(
-            (F.col("host") + 1) % 40,
-            (F.col("host") * 2 + 7) % 40,
-            (F.col("host") * 3 + 11) % 40,
-        )).alias("dst"),
-    )
-    ranks = hosts.withColumn("r", F.lit(1).cast("long"))
-    for t in range(_PR_ITERS):
-        tele = 9 * (60 ** t)
-        contrib = (
-            edges.join(ranks, edges.src == ranks.host)
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * 17).alias("s"))
-        )
-        ranks = (
-            hosts.join(contrib, hosts.host == contrib.dst, "left")
-            .select(
-                hosts.host,
-                (F.lit(tele) + F.coalesce(F.col("s"), F.lit(0))).cast("long").alias("r"),
-            )
-        )
-    n = hosts.agg(F.count("*").alias("n"))
-    return ranks.crossJoin(F.broadcast(n)).select(
-        "host",
-        F.col("r").alias("rank_scaled"),
-        (F.col("r").cast("double") / (F.col("n") * 12960000).cast("double")).alias("pr"),
-    )
-
-
-# --- PII detection + redaction accounting (q191) ------------------------------
-
-_PII_EMAIL = "[a-z0-9._%-]+@[a-z0-9.-]+\\.[a-z]{2,4}"
-_PII_PHONE = "\\+1-555-[0-9]{4}"
-_PII_IP = "10\\.[0-9]{1,3}\\.0\\.1"
-
-
-@query(
-    "q191_pii_redaction",
-    """WITH d AS (SELECT doc_id,
-                    text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-                    '@mail' || CAST(doc_id % 9 AS STRING) ||
-                    '.example.org call +1-555-' ||
-                    lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||
-                    ' from 10.' || CAST(doc_id % 256 AS VARCHAR) || '.0.1'
-                    AS body FROM documents)
-       SELECT doc_id,
-              CAST(len(regexp_extract_all(body, '[a-z0-9._%-]+@[a-z0-9.-]+\\.[a-z]{2,4}')) AS BIGINT) AS n_emails,
-              CAST(len(regexp_extract_all(body, '\\+1-555-[0-9]{4}')) AS BIGINT) AS n_phones,
-              CAST(len(regexp_extract_all(body, '10\\.[0-9]{1,3}\\.0\\.1')) AS BIGINT) AS n_ips,
-              CAST(length(body) AS BIGINT) AS raw_len,
-              CAST(length(
-                regexp_replace(
-                  regexp_replace(
-                    regexp_replace(body,
-                      '[a-z0-9._%-]+@[a-z0-9.-]+\\.[a-z]{2,4}', '[EMAIL]', 'g'),
-                    '\\+1-555-[0-9]{4}', '[PHONE]', 'g'),
-                  '10\\.[0-9]{1,3}\\.0\\.1', '[IP]', 'g')) AS BIGINT) AS redacted_len
-       FROM d""",
-)
-def q191(spark, sf_dir):
-    """PII detection + redaction accounting (the pre-training scrub
-    pass every web corpus runs: emails / phone numbers / bare IPs
-    found, replaced with typed placeholder tokens, and the char-mass
-    delta recorded).  The PII-bearing body is synthesized
-    deterministically from doc_id so both engines scan identical
-    bytes; detection and redaction are single-pass JVM regexps — no
-    Python in the plan, embarrassingly parallel at crawl scale."""
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    body = F.concat(
-        F.col("text"), F.lit(" contact user"), d.cast("string"),
-        F.lit("@mail"), (d % 9).cast("string"),
-        F.lit(".example.org call +1-555-"),
-        F.lpad((d % 10000).cast("string"), 4, "0"),
-        F.lit(" from 10."), (d % 256).cast("string"), F.lit(".0.1"),
-    )
-    b = F.col("body")
-    red = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(b, _PII_EMAIL, "[EMAIL]"),
-            _PII_PHONE, "[PHONE]"),
-        _PII_IP, "[IP]")
-    return docs.select("doc_id", body.alias("body")).select(
-        "doc_id",
-        F.size(F.regexp_extract_all(b, F.lit(_PII_EMAIL), F.lit(0))).cast("long").alias("n_emails"),
-        F.size(F.regexp_extract_all(b, F.lit(_PII_PHONE), F.lit(0))).cast("long").alias("n_phones"),
-        F.size(F.regexp_extract_all(b, F.lit(_PII_IP), F.lit(0))).cast("long").alias("n_ips"),
-        F.length(b).cast("long").alias("raw_len"),
-        F.length(red).cast("long").alias("redacted_len"),
     )
 
 
@@ -8053,7 +7622,7 @@ def _median_cut_oracle_sql(rounds: int = 3, n: int = 4096) -> str:
     )
 
 
-@query("q192_median_cut_rgb2pct", _median_cut_oracle_sql())
+@query("q192_median_cut_rgb2pct", _median_cut_oracle_sql(), kind="operator")
 def q192(spark, sf_dir):
     """rgb2pct: median-cut palette (alg/gdalmediancut.cpp re-pinned
     round-synchronous — split EVERY box at the lower median of its
@@ -8117,6 +7686,7 @@ def _dem2_tiles(spark):
               + greatest(a, b)
               + (a + b)/2.0 AS v
        FROM z""",
+    kind="operator",
 )
 def q193(spark, sf_dir):
     """VRT pixel-function family completion (frmts/vrt/
@@ -8147,112 +7717,6 @@ def q193(spark, sf_dir):
         fn, tile_size=DEM_TILE,
     )
     return tiles_to_features(out, tile_size=DEM_TILE, nodata=None)
-
-
-# --- model-based quality filter + paragraph dedup (q194-q195) -----------------
-
-
-@query(
-    "q194_quality_classifier",
-    """WITH f AS (SELECT doc_id, source, length(text) AS n_char,
-                    CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
-                         AS DOUBLE) AS n,
-                    CAST(len(list_filter(string_split(text, ' '),
-                         x -> x IN ('the','and','of','a'))) AS DOUBLE) AS s,
-                    CAST(length(regexp_replace(text, ' ', '', 'g')) AS DOUBLE) AS c,
-                    CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE) AS p
-              FROM documents WHERE length(text) > 0),
-       sc AS (SELECT doc_id, source, n_char,
-                     0.5*(s/n) + 0.125*(c/n) - 0.25*(p/n) AS score FROM f)
-       SELECT source,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(CASE WHEN score > 0.45 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-              CAST(sum(CASE WHEN score > 0.45 THEN n_char ELSE 0 END) AS BIGINT)
-                AS kept_chars
-       FROM sc GROUP BY source""",
-)
-def q194(spark, sf_dir):
-    """Model-based quality filter (the CCNet/fastText-style linear
-    scorer a web pipeline thresholds before training): score =
-    0.5*stopword_ratio + 0.125*mean_token_len - 0.25*punct_ratio.
-    DYADIC weights make each term an exact power-of-two scaling of an
-    IEEE-exact ratio, and the fixed left-to-right sum keeps the float
-    tree engine-identical, so the keep/drop decision is bitwise
-    reproducible.  Per-source keep-mass accounting is one
-    map-side-combinable aggregation."""
-    d = _t(spark, sf_dir, "documents").filter(F.length("text") > 0)
-    n = F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != "")).cast("double")
-    s = F.size(
-        F.filter(F.split(F.col("text"), " "),
-                 lambda x: x.isin("the", "and", "of", "a"))
-    ).cast("double")
-    c = F.length(F.regexp_replace(F.col("text"), " ", "")).cast("double")
-    p = F.size(F.regexp_extract_all(F.col("text"), F.lit("[^a-z0-9 ]"), F.lit(0))).cast("double")
-    sc = d.select(
-        "source", F.length("text").alias("n_char"),
-        (F.lit(0.5) * (s / n) + F.lit(0.125) * (c / n) - F.lit(0.25) * (p / n)).alias("score"),
-    )
-    return sc.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(F.col("score") > 0.45, 1).otherwise(0)).alias("n_kept"),
-        F.sum(F.when(F.col("score") > 0.45, F.col("n_char")).otherwise(0)).alias("kept_chars"),
-    )
-
-
-@query(
-    "q195_paragraph_dedup",
-    """WITH w AS (SELECT doc_id,
-                    list_filter(string_split(text, ' '), x -> x <> '') AS ws
-              FROM documents),
-       ch AS (SELECT doc_id, i AS chunk_idx,
-                     array_to_string(ws[(i*10+1):(i*10+10)], ' ') AS chunk
-              FROM w, unnest(range(0, CAST(ceil(len(ws)/10.0) AS BIGINT))) t(i)),
-       rk AS (SELECT doc_id, chunk_idx, chunk,
-                     row_number() OVER (PARTITION BY chunk
-                                        ORDER BY doc_id, chunk_idx) AS rk
-              FROM ch)
-       SELECT doc_id,
-              CAST(count(*) AS BIGINT) AS n_chunks,
-              CAST(sum(CASE WHEN rk > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dups,
-              round(CAST(sum(CASE WHEN rk > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                    / count(*), 6) AS dup_ratio
-       FROM rk GROUP BY doc_id""",
-)
-def q195(spark, sf_dir):
-    """Paragraph-level cross-document dedup accounting (the
-    Dolma/RefinedWeb unit between whole-doc md5 q17 and char-gram
-    spans q189): documents chunk into 10-word paragraphs; a chunk is
-    a DUPLICATE iff an identical chunk string exists at a smaller
-    (doc_id, chunk_idx).  One groupBy(chunk) window — the shuffle is
-    bounded by the chunk vocabulary, never doc×doc; per-doc dup mass
-    comes back from a second bounded aggregation."""
-    docs = _t(spark, sf_dir, "documents")
-    w = docs.select(
-        "doc_id",
-        F.filter(F.split(F.col("text"), " "), lambda x: x != "").alias("ws"),
-    )
-    ch = w.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                # size(ws)=0 must yield NO chunks: a bare sequence(0,-1)
-                # would DESCEND to [0,-1] and emit two phantom rows
-                "CASE WHEN size(ws) = 0 THEN array() ELSE "
-                "transform(sequence(0, CAST(ceil(size(ws)/10.0) AS BIGINT) - 1), "
-                "i -> struct(i AS chunk_idx, "
-                "array_join(slice(ws, CAST(i*10+1 AS INT), 10), ' ') AS chunk)) END"
-            )
-        ).alias("c"),
-    ).select("doc_id", F.col("c.chunk_idx").alias("chunk_idx"), F.col("c.chunk").alias("chunk"))
-    wnd = Window.partitionBy("chunk").orderBy("doc_id", "chunk_idx")
-    rk = ch.withColumn("rk", F.row_number().over(wnd))
-    return rk.groupBy("doc_id").agg(
-        F.count("*").alias("n_chunks"),
-        F.sum(F.when(F.col("rk") > 1, 1).otherwise(0)).alias("n_dups"),
-        F.round(
-            F.sum(F.when(F.col("rk") > 1, 1).otherwise(0)).cast("double") / F.count("*"), 6
-        ).alias("dup_ratio"),
-    )
 
 
 # --- Floyd-Steinberg dither, exact integer spec (q196) ------------------------
@@ -8354,7 +7818,7 @@ SELECT img, CAST(u.q AS BIGINT) AS pal_idx, cnts[u.q + 1] AS n
 FROM (SELECT img, cnts FROM st WHERE s = {w * h}) z, range(0, {npal}) u(q)"""
 
 
-@query("q196_fs_dither", _fs_dither_oracle_sql())
+@query("q196_fs_dither", _fs_dither_oracle_sql(), kind="operator")
 def q196(spark, sf_dir):
     """Floyd-Steinberg dithering (alg/gdaldither.cpp) under the exact
     integer spec of kernels/dither.py: per-image sequential error
@@ -8377,343 +7841,6 @@ def q196(spark, sf_dir):
             yield pd.DataFrame(rows, columns=["img", "pal_idx", "n"])
 
     return spark.range(4).repartition(4).mapInPandas(per_img, schema)
-
-
-# --- GCP polynomial transformer, order 1 (q197) -------------------------------
-
-def _crs_det3(a, b, c, d, e, f, g, h, i):
-    """det [[a,b,c],[d,e,f],[g,h,i]] with the fixed expansion
-    a*(e*i - f*h) - b*(d*i - f*g) + c*(d*h - e*g), as SQL text."""
-    return f"{a}*({e}*{i} - {f}*{h}) - {b}*({d}*{i} - {f}*{g}) + {c}*({d}*{h} - {e}*{g})"
-
-
-@query(
-    "q197_gcp_affine_fit",
-    f"""WITH gcp AS (SELECT CAST((i*17)%97 AS BIGINT) AS px, CAST((i*29)%89 AS BIGINT) AS py,
-                     CAST(3*((i*17)%97) - 2*((i*29)%89) + 40 + (i%3 - 1) AS BIGINT) AS gx,
-                     CAST(1*((i*17)%97) + 4*((i*29)%89) - 25 + (i%5 - 2) AS BIGINT) AS gy
-              FROM range(0, 12) t(i)),
-       s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum(px) AS BIGINT) AS sx, CAST(sum(py) AS BIGINT) AS sy,
-                    CAST(sum(px*px) AS BIGINT) AS sxx, CAST(sum(px*py) AS BIGINT) AS sxy,
-                    CAST(sum(py*py) AS BIGINT) AS syy,
-                    CAST(sum(gx) AS BIGINT) AS tx0, CAST(sum(px*gx) AS BIGINT) AS tx1,
-                    CAST(sum(py*gx) AS BIGINT) AS tx2,
-                    CAST(sum(gy) AS BIGINT) AS ty0, CAST(sum(px*gy) AS BIGINT) AS ty1,
-                    CAST(sum(py*gy) AS BIGINT) AS ty2
-             FROM gcp),
-       c AS (SELECT
-            CAST({_crs_det3('n','sx','sy','sx','sxx','sxy','sy','sxy','syy')} AS DOUBLE) AS dd,
-            CAST({_crs_det3('tx0','sx','sy','tx1','sxx','sxy','tx2','sxy','syy')} AS DOUBLE) AS na0,
-            CAST({_crs_det3('n','tx0','sy','sx','tx1','sxy','sy','tx2','syy')} AS DOUBLE) AS na1,
-            CAST({_crs_det3('n','sx','tx0','sx','sxx','tx1','sy','sxy','tx2')} AS DOUBLE) AS na2,
-            CAST({_crs_det3('ty0','sx','sy','ty1','sxx','sxy','ty2','sxy','syy')} AS DOUBLE) AS nb0,
-            CAST({_crs_det3('n','ty0','sy','sx','ty1','sxy','sy','ty2','syy')} AS DOUBLE) AS nb1,
-            CAST({_crs_det3('n','sx','ty0','sx','sxx','ty1','sy','sxy','ty2')} AS DOUBLE) AS nb2
-            FROM s)
-       SELECT doc_id,
-              (na0/dd) + (na1/dd)*CAST(doc_id%23 AS DOUBLE)
-                       + (na2/dd)*CAST((doc_id*7)%19 AS DOUBLE) AS tx,
-              (nb0/dd) + (nb1/dd)*CAST(doc_id%23 AS DOUBLE)
-                       + (nb2/dd)*CAST((doc_id*7)%19 AS DOUBLE) AS ty
-       FROM documents, c""",
-)
-def q197(spark, sf_dir):
-    """GCP polynomial transformer, order 1 (alg/gdal_crs.cpp
-    CRS_georef): least-squares affine fit from 12 integer ground
-    control points solved EXACTLY by 3x3 Cramer determinants over the
-    integer normal-equation sums (every determinant < 2^53 ⇒ the
-    doubles are exact and the fit is bitwise reproducible), then the
-    fitted transform applied to per-document query coordinates.  One
-    bounded aggregation + one broadcast of the 1-row coefficient
-    table — the apply side is embarrassingly parallel."""
-    i = F.col("id")
-    gcp = spark.range(12).select(
-        ((i * 17) % 97).cast("long").alias("px"),
-        ((i * 29) % 89).cast("long").alias("py"),
-        (3 * ((i * 17) % 97) - 2 * ((i * 29) % 89) + 40 + (i % 3 - 1))
-        .cast("long").alias("gx"),
-        (1 * ((i * 17) % 97) + 4 * ((i * 29) % 89) - 25 + (i % 5 - 2))
-        .cast("long").alias("gy"),
-    )
-    s = gcp.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("px").alias("sx"), F.sum("py").alias("sy"),
-        F.sum(F.col("px") * F.col("px")).alias("sxx"),
-        F.sum(F.col("px") * F.col("py")).alias("sxy"),
-        F.sum(F.col("py") * F.col("py")).alias("syy"),
-        F.sum("gx").alias("tx0"),
-        F.sum(F.col("px") * F.col("gx")).alias("tx1"),
-        F.sum(F.col("py") * F.col("gx")).alias("tx2"),
-        F.sum("gy").alias("ty0"),
-        F.sum(F.col("px") * F.col("gy")).alias("ty1"),
-        F.sum(F.col("py") * F.col("gy")).alias("ty2"),
-    )
-
-    def det3(a, b, c, d, e, f, g, h, i_):
-        C = F.col
-        return (
-            C(a) * (C(e) * C(i_) - C(f) * C(h))
-            - C(b) * (C(d) * C(i_) - C(f) * C(g))
-            + C(c) * (C(d) * C(h) - C(e) * C(g))
-        )
-
-    coef = s.select(
-        det3("n", "sx", "sy", "sx", "sxx", "sxy", "sy", "sxy", "syy").cast("double").alias("dd"),
-        det3("tx0", "sx", "sy", "tx1", "sxx", "sxy", "tx2", "sxy", "syy").cast("double").alias("na0"),
-        det3("n", "tx0", "sy", "sx", "tx1", "sxy", "sy", "tx2", "syy").cast("double").alias("na1"),
-        det3("n", "sx", "tx0", "sx", "sxx", "tx1", "sy", "sxy", "tx2").cast("double").alias("na2"),
-        det3("ty0", "sx", "sy", "ty1", "sxx", "sxy", "ty2", "sxy", "syy").cast("double").alias("nb0"),
-        det3("n", "ty0", "sy", "sx", "ty1", "sxy", "sy", "ty2", "syy").cast("double").alias("nb1"),
-        det3("n", "sx", "ty0", "sx", "sxx", "ty1", "sy", "sxy", "ty2").cast("double").alias("nb2"),
-    )
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    qx = (d % 23).cast("double")
-    qy = ((d * 7) % 19).cast("double")
-    C = F.col
-    return docs.crossJoin(F.broadcast(coef)).select(
-        "doc_id",
-        ((C("na0") / C("dd")) + (C("na1") / C("dd")) * qx
-         + (C("na2") / C("dd")) * qy).alias("tx"),
-        ((C("nb0") / C("dd")) + (C("nb1") / C("dd")) * qx
-         + (C("nb2") / C("dd")) * qy).alias("ty"),
-    )
-
-
-# --- RPC transform (q198) and geolocation-array inverse (q199) ----------------
-
-# RPC00B monomial order (alg/gdal_rpc.cpp RPCEvaluate): 1 L P H LP LH PH
-# L2 P2 H2 PLH L3 LP2 LH2 L2P P3 PH2 L2H P2H H3  (L=ln, P=pn, H=hn)
-_RPC_MONOS = [
-    "1", "ln", "pn", "hn", "ln*pn", "ln*hn", "pn*hn", "ln*ln", "pn*pn",
-    "hn*hn", "pn*ln*hn", "ln*ln*ln", "ln*pn*pn", "ln*hn*hn", "ln*ln*pn",
-    "pn*pn*pn", "pn*hn*hn", "ln*ln*hn", "pn*pn*hn", "hn*hn*hn",
-]
-# dyadic coefficients (sixteenths) — exact power-of-two scalings
-_RPC_LINE_NUM = [16, 4, -8, 2, 1, -1, 2, 1, -2, 1, 1, 0, 1, 0, -1, 1, 0, 1, 0, -1]
-_RPC_LINE_DEN = [16, 1, 1, 0, 0, 1, 0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_RPC_SAMP_NUM = [16, -6, 5, -2, 2, 1, -1, 2, 1, -1, 0, 1, 0, 1, 1, 0, -1, 0, 1, 0]
-_RPC_SAMP_DEN = [16, 0, 1, 1, 1, 0, 0, 0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-
-
-def _rpc_poly_sql(coeffs):
-    terms = [
-        f"({c}/16.0)*{m}" if m != "1" else f"({c}/16.0)"
-        for c, m in zip(coeffs, _RPC_MONOS) if c != 0
-    ]
-    return " + ".join(terms)
-
-
-def _rpc_poly_col(coeffs, ln, pn, hn):
-    monos = {
-        "1": F.lit(1.0), "ln": ln, "pn": pn, "hn": hn,
-        "ln*pn": ln * pn, "ln*hn": ln * hn, "pn*hn": pn * hn,
-        "ln*ln": ln * ln, "pn*pn": pn * pn, "hn*hn": hn * hn,
-        "pn*ln*hn": pn * ln * hn, "ln*ln*ln": ln * ln * ln,
-        "ln*pn*pn": ln * pn * pn, "ln*hn*hn": ln * hn * hn,
-        "ln*ln*pn": ln * ln * pn, "pn*pn*pn": pn * pn * pn,
-        "pn*hn*hn": pn * hn * hn, "ln*ln*hn": ln * ln * hn,
-        "pn*pn*hn": pn * pn * hn, "hn*hn*hn": hn * hn * hn,
-    }
-    acc = None
-    for c, m in zip(coeffs, _RPC_MONOS):
-        if c == 0:
-            continue
-        term = F.lit(c / 16.0) if m == "1" else F.lit(c / 16.0) * monos[m]
-        acc = term if acc is None else acc + term
-    return acc
-
-
-@query(
-    "q198_rpc_transform",
-    f"""WITH q AS (SELECT doc_id,
-                    CAST(doc_id%21 - 10 AS DOUBLE)/10.0 AS ln,
-                    CAST((doc_id*3)%19 - 9 AS DOUBLE)/9.0 AS pn,
-                    CAST(doc_id%7 - 3 AS DOUBLE)/3.0 AS hn
-              FROM documents)
-       SELECT doc_id,
-              (({_rpc_poly_sql(_RPC_LINE_NUM)}) / ({_rpc_poly_sql(_RPC_LINE_DEN)}))
-                * 512.0 + 1024.0 AS rpc_line,
-              (({_rpc_poly_sql(_RPC_SAMP_NUM)}) / ({_rpc_poly_sql(_RPC_SAMP_DEN)}))
-                * 768.0 + 1536.0 AS rpc_samp
-       FROM q""",
-)
-def q198(spark, sf_dir):
-    """RPC (rational polynomial coefficients) forward transform
-    (alg/gdal_rpc.cpp RPCEvaluate / RPCTransformPoint): line/sample =
-    cubic-ratio of the 20-monomial RPC00B basis in normalized
-    lon/lat/height, then de-normalized by scale+offset.  Dyadic
-    coefficients (sixteenths) and a fixed left-to-right term order
-    keep the float tree engine-identical term-for-term.  Pure Column
-    arithmetic — zero Python per row; the inverse (iterative in the
-    reference, gdalgenericinverse.cpp) follows the unrolled-refinement
-    pattern of functions/proj.py."""
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    ln = (d % 21 - 10).cast("double") / 10.0
-    pn = ((d * 3) % 19 - 9).cast("double") / 9.0
-    hn = (d % 7 - 3).cast("double") / 3.0
-    line = (
-        _rpc_poly_col(_RPC_LINE_NUM, ln, pn, hn)
-        / _rpc_poly_col(_RPC_LINE_DEN, ln, pn, hn)
-    ) * 512.0 + 1024.0
-    samp = (
-        _rpc_poly_col(_RPC_SAMP_NUM, ln, pn, hn)
-        / _rpc_poly_col(_RPC_SAMP_DEN, ln, pn, hn)
-    ) * 768.0 + 1536.0
-    return docs.select("doc_id", line.alias("rpc_line"), samp.alias("rpc_samp"))
-
-
-@query(
-    "q199_geoloc_inverse",
-    """WITH geo AS (SELECT CAST(px.range AS BIGINT) AS px, CAST(py.range AS BIGINT) AS py,
-                     CAST(2*px.range + py.range%3 AS BIGINT) AS glon,
-                     CAST(3*py.range + px.range%2 AS BIGINT) AS glat
-              FROM range(64) px, range(64) py),
-       gb AS (SELECT *, CAST((glon - ((glon%8+8)%8))/8 AS BIGINT) AS bx,
-                        CAST((glat - ((glat%8+8)%8))/8 AS BIGINT) AS by FROM geo),
-       q AS (SELECT doc_id, CAST(doc_id%128 AS BIGINT) AS qlon,
-                    CAST((doc_id*3)%190 AS BIGINT) AS qlat FROM documents),
-       qb AS (SELECT *, CAST((qlon - ((qlon%8+8)%8))/8 AS BIGINT) AS bx,
-                        CAST((qlat - ((qlat%8+8)%8))/8 AS BIGINT) AS by FROM q),
-       cand AS (SELECT q.doc_id, q.qlon, q.qlat, g.px, g.py,
-                       (q.qlon-g.glon)*(q.qlon-g.glon)
-                       + (q.qlat-g.glat)*(q.qlat-g.glat) AS d2
-                FROM qb q, unnest([-1,0,1]) dx(dx), unnest([-1,0,1]) dy(dy)
-                JOIN gb g ON g.bx = q.bx + dx AND g.by = q.by + dy),
-       rk AS (SELECT doc_id, px, py, d2,
-                     row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY d2, px, py) AS rn FROM cand)
-       SELECT doc_id, px, py, d2 FROM rk WHERE rn = 1""",
-)
-def q199(spark, sf_dir):
-    """Geolocation-array INVERSE transform (alg/gdalgeoloc.cpp +
-    gdalgeolocquadtree.cpp): given query lon/lat, find the geolocation
-    grid cell whose (lon,lat) value is nearest (squared distance, ties
-    to smallest pixel).  The reference walks a quadtree; the
-    distributed re-expression buckets the geoloc array by quantized
-    value and each query joins its 3x3 bucket neighborhood — candidate
-    count is bounded by bucket occupancy, never query x grid.  At a
-    10^8-cell geoloc array the bucket table shards by hash like any
-    equi-join."""
-    px = spark.range(64).select(F.col("id").alias("px"))
-    py = spark.range(64).select(F.col("id").alias("py"))
-    geo = px.crossJoin(py).select(
-        "px", "py",
-        (2 * F.col("px") + F.col("py") % 3).alias("glon"),
-        (3 * F.col("py") + F.col("px") % 2).alias("glat"),
-    )
-
-    def bucket(c):
-        return ((c - ((c % 8 + 8) % 8)) / 8).cast("long")
-
-    gb = geo.withColumn("bx", bucket(F.col("glon"))).withColumn(
-        "by", bucket(F.col("glat")))
-    d = F.col("doc_id")
-    q = _t(spark, sf_dir, "documents").select(
-        "doc_id", (d % 128).alias("qlon"), ((d * 3) % 190).alias("qlat"))
-    qb = (
-        q.withColumn("bx0", bucket(F.col("qlon")))
-        .withColumn("by0", bucket(F.col("qlat")))
-        .withColumn("dx", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .withColumn("dy", F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))))
-        .select("doc_id", "qlon", "qlat",
-                (F.col("bx0") + F.col("dx")).alias("bx"),
-                (F.col("by0") + F.col("dy")).alias("by"))
-    )
-    dlon = F.col("qlon") - F.col("glon")
-    dlat = F.col("qlat") - F.col("glat")
-    cand = qb.join(F.broadcast(gb), ["bx", "by"]).withColumn(
-        "d2", dlon * dlon + dlat * dlat)
-    w = Window.partitionBy("doc_id").orderBy("d2", "px", "py")
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "px", "py", "d2")
-    )
-
-
-# --- 4-point homography, exact integer adjugate construction (q200) -----------
-
-# literal GCP quads (general position, small coords keep every integer
-# product < 2^53 so the doubles are exact end-to-end)
-_HOM_SRC = [(0, 0), (13, 1), (2, 12), (11, 10)]
-_HOM_DST = [(1, 2), (14, 0), (0, 13), (12, 14)]
-
-
-def _hom_det3(m):
-    return (
-        m[0][0] * (m[1][1] * m[2][2] - m[1][2] * m[2][1])
-        - m[0][1] * (m[1][0] * m[2][2] - m[1][2] * m[2][0])
-        + m[0][2] * (m[1][0] * m[2][1] - m[1][1] * m[2][0])
-    )
-
-
-def _hom_basis_matrix(quad):
-    """Integer matrix mapping the projective basis quad to `quad`
-    (scale-invariant: the common Cramer denominator is dropped)."""
-    (x1, y1), (x2, y2), (x3, y3), (x4, y4) = quad
-    a0 = [[x1, x2, x3], [y1, y2, y3], [1, 1, 1]]
-    nl = _hom_det3([[x4, x2, x3], [y4, y2, y3], [1, 1, 1]])
-    nm = _hom_det3([[x1, x4, x3], [y1, y4, y3], [1, 1, 1]])
-    nt = _hom_det3([[x1, x2, x4], [y1, y2, y4], [1, 1, 1]])
-    return [
-        [a0[r][0] * nl, a0[r][1] * nm, a0[r][2] * nt] for r in range(3)
-    ]
-
-
-def _hom_matrix():
-    """H ∝ B · adj(A): exact integers, no division anywhere in the solve."""
-    A = _hom_basis_matrix(_HOM_SRC)
-    B = _hom_basis_matrix(_HOM_DST)
-    # adjugate (cofactor transpose) of A
-    def cof(i, j):
-        m = [[A[r][c] for c in range(3) if c != j] for r in range(3) if r != i]
-        s = m[0][0] * m[1][1] - m[0][1] * m[1][0]
-        return s if (i + j) % 2 == 0 else -s
-
-    adjA = [[cof(j, i) for j in range(3)] for i in range(3)]
-    return [
-        [sum(B[r][k] * adjA[k][c] for k in range(3)) for c in range(3)]
-        for r in range(3)
-    ]
-
-
-@query(
-    "q200_homography",
-    f"""WITH h AS (SELECT {", ".join(
-        f"CAST({v} AS BIGINT) AS h{r}{c}"
-        for r, row in enumerate(_hom_matrix()) for c, v in enumerate(row)
-    )})
-       SELECT doc_id,
-              CAST(h00*(doc_id%13) + h01*((doc_id*5)%11) + h02 AS DOUBLE)
-              / CAST(h20*(doc_id%13) + h21*((doc_id*5)%11) + h22 AS DOUBLE) AS hx,
-              CAST(h10*(doc_id%13) + h11*((doc_id*5)%11) + h12 AS DOUBLE)
-              / CAST(h20*(doc_id%13) + h21*((doc_id*5)%11) + h22 AS DOUBLE) AS hy
-       FROM documents, h""",
-)
-def q200(spark, sf_dir):
-    """4-point homography (alg/gdal_homography.cpp): H built EXACTLY in
-    integers via the projective-basis construction — Cramer numerators
-    for each quad (the common denominator drops by scale invariance),
-    then H ∝ B·adj(A); no division until the final perspective divide,
-    so the fit is bitwise reproducible.  Applied per-document as pure
-    Column arithmetic (the 9 integer entries are plan literals — the
-    solve is a bounded 3x3 problem, like the reference's)."""
-    H = _hom_matrix()
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    x = d % 13
-    y = (d * 5) % 11
-    u = F.lit(H[0][0]) * x + F.lit(H[0][1]) * y + F.lit(H[0][2])
-    v = F.lit(H[1][0]) * x + F.lit(H[1][1]) * y + F.lit(H[1][2])
-    w = F.lit(H[2][0]) * x + F.lit(H[2][1]) * y + F.lit(H[2][2])
-    return docs.select(
-        "doc_id",
-        (u.cast("double") / w.cast("double")).alias("hx"),
-        (v.cast("double") / w.cast("double")).alias("hy"),
-    )
 
 
 # --- SURF keypoints + feature matching (q201-q202) ----------------------------
@@ -8792,6 +7919,7 @@ def _surf_resp_sql(img_of, cen="cen") -> str:
                      FROM range(5, 27) x, range(5, 27) y),
        {_surf_resp_sql(lambda a, b: _surf_img_sql(a, b))}
        SELECT x AS gx, y AS gy, CAST(doh AS BIGINT) AS doh FROM kp""",
+    kind="operator",
 )
 def q201(spark, sf_dir):
     """SURF-style keypoint detection (alg/gdal_simplesurf.cpp): 9x9
@@ -8852,7 +7980,7 @@ def _surf_match_oracle() -> str:
     SELECT xa, ya, xb, yb, dist FROM rk WHERE rna = 1 AND rnb = 1"""
 
 
-@query("q202_feature_matching", _surf_match_oracle())
+@query("q202_feature_matching", _surf_match_oracle(), kind="operator")
 def q202(spark, sf_dir):
     """Feature-point matching between two images
     (alg/gdalmatching.cpp GDALComputeMatchingPoints): SURF keypoints +
@@ -8874,438 +8002,6 @@ def q202(spark, sf_dir):
     return match_keypoints(kpa, kpb)
 
 
-# --- polyharmonic-spline GCP transformer (q203) --------------------------------
-
-_PHS_GCPS = [((i * 13) % 31, (i * 23) % 29) for i in range(8)]
-_PHS_TX = [2 * px - py + 7 + (i % 3) for i, (px, py) in enumerate(_PHS_GCPS)]
-_PHS_TY = [px + 3 * py - 11 + (i % 2) for i, (px, py) in enumerate(_PHS_GCPS)]
-
-
-def _phs_solve():
-    """Driver-side bounded solve (the GCP count is small by the nature
-    of the op — same cost contract as the RAT / noder kernels): radial
-    basis phi(r^2) = r^2 * sqrt(r^2) (polyharmonic r^3 — the
-    TPS-family basis that stays engine-exact because IEEE sqrt is
-    correctly rounded, unlike r^2*log r^2) + affine part.
-    Returns (wx, wy) lists of 11 float coefficients each."""
-    n = len(_PHS_GCPS)
-    A = np.zeros((n + 3, n + 3))
-    for i, (xi, yi) in enumerate(_PHS_GCPS):
-        for j, (xj, yj) in enumerate(_PHS_GCPS):
-            r2 = float((xi - xj) ** 2 + (yi - yj) ** 2)
-            A[i, j] = r2 * np.sqrt(r2)
-        A[i, n] = 1.0
-        A[i, n + 1] = xi
-        A[i, n + 2] = yi
-        A[n, i] = 1.0
-        A[n + 1, i] = xi
-        A[n + 2, i] = yi
-    bx = np.concatenate([np.array(_PHS_TX, dtype=np.float64), np.zeros(3)])
-    by = np.concatenate([np.array(_PHS_TY, dtype=np.float64), np.zeros(3)])
-    wx = np.linalg.solve(A, bx)
-    wy = np.linalg.solve(A, by)
-    # interpolation property: the spline passes through every GCP
-    for i, (xi, yi) in enumerate(_PHS_GCPS):
-        acc = wx[n] + wx[n + 1] * xi + wx[n + 2] * yi
-        for j, (xj, yj) in enumerate(_PHS_GCPS):
-            r2 = float((xi - xj) ** 2 + (yi - yj) ** 2)
-            acc += wx[j] * r2 * np.sqrt(r2)
-        assert abs(acc - _PHS_TX[i]) < 1e-8, (i, acc, _PHS_TX[i])
-    return wx.tolist(), wy.tolist()
-
-
-_PHS_WX, _PHS_WY = _phs_solve()
-
-
-def _phs_apply_sql(w, qx: str, qy: str) -> str:
-    """Fixed left-to-right apply tree; coefficients inlined verbatim at
-    17 significant digits (round-trips to the identical double)."""
-    n = len(_PHS_GCPS)
-    terms = []
-    for j, (xj, yj) in enumerate(_PHS_GCPS):
-        r2 = f"CAST(({qx} - {xj})*({qx} - {xj}) + ({qy} - {yj})*({qy} - {yj}) AS DOUBLE)"
-        terms.append(f"CAST('{w[j]:.17g}' AS DOUBLE) * ({r2} * sqrt({r2}))")
-    terms.append(f"CAST('{w[n]:.17g}' AS DOUBLE)")
-    terms.append(f"CAST('{w[n + 1]:.17g}' AS DOUBLE) * CAST({qx} AS DOUBLE)")
-    terms.append(f"CAST('{w[n + 2]:.17g}' AS DOUBLE) * CAST({qy} AS DOUBLE)")
-    return " + ".join(terms)
-
-
-def _phs_apply_col(w, qx, qy):
-    n = len(_PHS_GCPS)
-    acc = None
-    for j, (xj, yj) in enumerate(_PHS_GCPS):
-        r2 = ((qx - xj) * (qx - xj) + (qy - yj) * (qy - yj)).cast("double")
-        t = F.lit(float(f"{w[j]:.17g}")) * (r2 * F.sqrt(r2))
-        acc = t if acc is None else acc + t
-    acc = acc + F.lit(float(f"{w[n]:.17g}"))
-    acc = acc + F.lit(float(f"{w[n + 1]:.17g}")) * qx.cast("double")
-    acc = acc + F.lit(float(f"{w[n + 2]:.17g}")) * qy.cast("double")
-    return acc
-
-
-@query(
-    "q203_polyharmonic_gcp",
-    f"""SELECT doc_id,
-          {_phs_apply_sql(_PHS_WX, "doc_id%37", "(doc_id*11)%41")} AS tx,
-          {_phs_apply_sql(_PHS_WY, "doc_id%37", "(doc_id*11)%41")} AS ty
-       FROM documents""",
-)
-def q203(spark, sf_dir):
-    """TPS-family GCP transformer (alg/gdal_tps.cpp /
-    alg/thinplatespline.cpp): radial-basis interpolation through 8
-    control points + affine part, solved once driver-side (bounded,
-    like the reference's per-transformer solve) and applied as pure
-    Column arithmetic.  Basis phi = r^3 (= r^2*sqrt(r^2), exact across
-    engines; the reference's r^2*log r^2 differs only in the basis
-    kernel — log is not correctly-rounded portable, sqrt is).
-    Interpolation through every GCP is asserted at solve time."""
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    qx = d % 37
-    qy = (d * 11) % 41
-    return docs.select(
-        "doc_id",
-        _phs_apply_col(_PHS_WX, qx, qy).alias("tx"),
-        _phs_apply_col(_PHS_WY, qx, qy).alias("ty"),
-    )
-
-
-# --- DSIR-style importance weights (q204) --------------------------------------
-
-
-@query(
-    "q204_importance_weights",
-    """WITH occ AS (SELECT d.doc_id, d.lang,
-                      ascii(substr(w.w, 1, 1)) % 8 AS f
-              FROM documents d,
-                   unnest(list_filter(string_split(d.text, ' '), x -> x <> '')) w(w)),
-       tot AS (SELECT CAST(count(*) AS BIGINT) AS s_tot,
-                      CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS t_tot
-               FROM occ),
-       fr AS (SELECT f, CAST(count(*) AS BIGINT) AS s_f,
-                     CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS t_f
-              FROM occ GROUP BY f),
-       rat AS (SELECT f, CAST(t_f * t2.s_tot AS DOUBLE) / CAST(s_f * t2.t_tot AS DOUBLE) AS r
-               FROM fr, tot t2),
-       df AS (SELECT DISTINCT doc_id, f FROM occ),
-       dl AS (SELECT d.doc_id, list(r.r ORDER BY d.f) AS rs,
-                     CAST(count(*) AS BIGINT) AS n_feats
-              FROM df d JOIN rat r USING (f) GROUP BY d.doc_id)
-       SELECT doc_id, n_feats, list_reduce(rs, (a, b) -> a * b) AS iw FROM dl""",
-)
-def q204(spark, sf_dir):
-    """DSIR-style importance weights (Xie et al. 2023: hashed-feature
-    importance resampling for domain-targeted data selection): feature
-    = first-char bucket, target = the 'en' slice, per-doc weight =
-    PRODUCT over the doc's distinct features of the target/source
-    probability ratio.  Each ratio is one exact integer-product
-    division; the product folds LEFT-TO-RIGHT over the feature-sorted
-    list on both engines (Spark F.aggregate vs DuckDB list_reduce —
-    1.0*x is an IEEE identity), so the float tree is engine-identical.
-    Shuffles: one bounded feature aggregation (8 rows, broadcast back)
-    + one per-doc distinct — never doc×doc."""
-    docs = _t(spark, sf_dir, "documents")
-    occ = docs.select(
-        "doc_id", "lang",
-        F.explode(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-        ).alias("w"),
-    ).select(
-        "doc_id", "lang",
-        (F.ascii(F.substring(F.col("w"), 1, 1)) % 8).alias("f"),
-    ).persist()  # feeds totals, per-feature counts AND the per-doc distinct
-    tot = occ.agg(
-        F.count("*").alias("s_tot"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("t_tot"),
-    )
-    fr = occ.groupBy("f").agg(
-        F.count("*").alias("s_f"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("t_f"),
-    )
-    rat = fr.crossJoin(F.broadcast(tot)).select(
-        "f",
-        (
-            (F.col("t_f") * F.col("s_tot")).cast("double")
-            / (F.col("s_f") * F.col("t_tot")).cast("double")
-        ).alias("r"),
-    )
-    df_ = occ.select("doc_id", "f").distinct()
-    dl = (
-        df_.join(F.broadcast(rat), "f")
-        .groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("f", "r"))).alias("frs"),
-            F.count("*").alias("n_feats"),
-        )
-    )
-    return dl.select(
-        "doc_id", "n_feats",
-        F.aggregate(
-            F.col("frs"), F.lit(1.0), lambda acc, s: acc * s["r"]
-        ).alias("iw"),
-    )
-
-
-# --- vertical shift grid apply (q205) ------------------------------------------
-
-
-@query(
-    "q205_vertical_shift_grid",
-    f"""WITH g AS (SELECT gx.range AS gx, gy.range AS gy
-                   FROM range(32) gx, range(32) gy),
-       dem AS (SELECT gx, gy, CAST({_z_sql('gx', 'gy')} AS DOUBLE) AS z FROM g),
-       grid AS (SELECT cx.range AS cx, cy.range AS cy,
-                       CAST((cx.range*5 + cy.range*3) % 11 - 5 AS DOUBLE) AS s
-                FROM range(9) cx, range(9) cy),
-       px AS (SELECT gx, gy, z,
-                     CAST((gx - gx%4)/4 AS BIGINT) AS cx,
-                     CAST((gy - gy%4)/4 AS BIGINT) AS cy,
-                     CAST(gx%4 AS DOUBLE)/4.0 AS fx,
-                     CAST(gy%4 AS DOUBLE)/4.0 AS fy
-              FROM dem)
-       SELECT p.gx, p.gy,
-              p.z + ((g00.s*(1.0-p.fx) + g10.s*p.fx)*(1.0-p.fy)
-                     + (g01.s*(1.0-p.fx) + g11.s*p.fx)*p.fy) AS v
-       FROM px p
-       JOIN grid g00 ON g00.cx = p.cx     AND g00.cy = p.cy
-       JOIN grid g10 ON g10.cx = p.cx + 1 AND g10.cy = p.cy
-       JOIN grid g01 ON g01.cx = p.cx     AND g01.cy = p.cy + 1
-       JOIN grid g11 ON g11.cx = p.cx + 1 AND g11.cy = p.cy + 1""",
-)
-def q205(spark, sf_dir):
-    """Vertical shift grid apply (alg/gdalapplyverticalshiftgrid.cpp):
-    DEM + bilinear sample of a coarse datum-shift grid at 4x upsampling.
-    The grid-to-pixel ratio is a power of two, so the bilinear weights
-    are DYADIC (0, .25, .5, .75) and the result is exact across
-    engines.  The shift grid is a real DataFrame joined once per
-    corner — four broadcast hash joins, the same plan at a 10^6-cell
-    grid; the DEM side stays linear."""
-    spark_range = spark.range(32)
-    g = spark_range.select(F.col("id").alias("gx")).crossJoin(
-        spark.range(32).select(F.col("id").alias("gy")))
-    dem = g.select(
-        "gx", "gy",
-        ((F.col("gx") * 7 + F.col("gy") * 13) % 97
-         + (F.col("gx") * F.col("gx")) % 23).cast("double").alias("z"),
-    )
-    grid = (
-        spark.range(9).select(F.col("id").alias("cx"))
-        .crossJoin(spark.range(9).select(F.col("id").alias("cy")))
-        .select("cx", "cy",
-                ((F.col("cx") * 5 + F.col("cy") * 3) % 11 - 5)
-                .cast("double").alias("s"))
-    )
-    px = dem.select(
-        "gx", "gy", "z",
-        ((F.col("gx") - F.col("gx") % 4) / 4).cast("long").alias("cx"),
-        ((F.col("gy") - F.col("gy") % 4) / 4).cast("long").alias("cy"),
-        ((F.col("gx") % 4).cast("double") / 4.0).alias("fx"),
-        ((F.col("gy") % 4).cast("double") / 4.0).alias("fy"),
-    )
-    def corner(alias, dx, dy):
-        return F.broadcast(grid.select(
-            (F.col("cx") - dx).alias("cx"), (F.col("cy") - dy).alias("cy"),
-            F.col("s").alias(alias)))
-    out = (
-        px.join(corner("s00", 0, 0), ["cx", "cy"])
-        .join(corner("s10", 1, 0), ["cx", "cy"])
-        .join(corner("s01", 0, 1), ["cx", "cy"])
-        .join(corner("s11", 1, 1), ["cx", "cy"])
-    )
-    fx, fy = F.col("fx"), F.col("fy")
-    bil = (
-        (F.col("s00") * (F.lit(1.0) - fx) + F.col("s10") * fx) * (F.lit(1.0) - fy)
-        + (F.col("s01") * (F.lit(1.0) - fx) + F.col("s11") * fx) * fy
-    )
-    return out.select("gx", "gy", (F.col("z") + bil).alias("v"))
-
-
-# --- crawl-infrastructure ops (q206-q208) ---------------------------------------
-
-
-@query(
-    "q206_cdx_capture_dedup",
-    f"""WITH d AS (SELECT doc_id, {_URL_RAW_SQL} AS url FROM documents),
-       cap AS (SELECT d.url,
-                      CAST(20260101 + (d.doc_id*7 + k.range*13) % 90 AS BIGINT) AS ts,
-                      CAST((d.doc_id*31 + k.range*k.range) % 5 AS BIGINT) AS digest
-               FROM d, range(0, 3) k),
-       rk AS (SELECT url, ts, digest,
-                     row_number() OVER (PARTITION BY url, digest ORDER BY ts) AS rn
-              FROM cap)
-       SELECT url,
-              CAST(count(*) AS BIGINT) AS n_captures,
-              CAST(count(DISTINCT digest) AS BIGINT) AS n_unique,
-              CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_revisits,
-              CAST(max(ts) AS BIGINT) AS last_ts
-       FROM rk GROUP BY url""",
-)
-def q206(spark, sf_dir):
-    """CDX-style capture index dedup (the Common-Crawl/Wayback revisit
-    record): per URL, captures collapse to unique content digests; a
-    capture whose digest already appeared at an earlier timestamp is a
-    REVISIT.  One window per (url, digest) + one per-url aggregation —
-    both shuffle on the url hash, the natural CDX shard key."""
-    docs = _t(spark, sf_dir, "documents").withColumn("url", _url_raw_col())
-    cap = docs.select(
-        "url",
-        F.explode(F.sequence(F.lit(0), F.lit(2))).alias("k"),
-        F.col("doc_id"),
-    ).select(
-        "url",
-        (20260101 + (F.col("doc_id") * 7 + F.col("k") * 13) % 90).alias("ts"),
-        ((F.col("doc_id") * 31 + F.col("k") * F.col("k")) % 5).alias("digest"),
-    )
-    w = Window.partitionBy("url", "digest").orderBy("ts")
-    rk = cap.withColumn("rn", F.row_number().over(w))
-    return rk.groupBy("url").agg(
-        F.count("*").alias("n_captures"),
-        F.countDistinct("digest").alias("n_unique"),
-        F.sum(F.when(F.col("rn") > 1, 1).otherwise(0)).alias("n_revisits"),
-        F.max("ts").alias("last_ts"),
-    )
-
-
-@query(
-    "q207_anchor_text",
-    """WITH l AS (SELECT (doc_id*3 + 1) % 40 AS tgt,
-                    list_filter(string_split(text, ' '), x -> x <> '')
-                      [CAST(doc_id%10 + 1 AS INT)] AS anchor
-              FROM documents),
-       c AS (SELECT tgt, anchor, CAST(count(*) AS BIGINT) AS n
-             FROM l WHERE anchor IS NOT NULL GROUP BY tgt, anchor),
-       rk AS (SELECT tgt, anchor, n,
-                     row_number() OVER (PARTITION BY tgt
-                                        ORDER BY n DESC, anchor) AS rn,
-                     sum(n) OVER (PARTITION BY tgt) AS total
-              FROM c)
-       SELECT tgt AS host, CAST(total AS BIGINT) AS n_links,
-              anchor AS top_anchor, n AS top_n
-       FROM rk WHERE rn = 1""",
-)
-def q207(spark, sf_dir):
-    """Anchor-text aggregation (the link-graph signal web search and
-    curation pipelines mine: what the web CALLS a page): per target
-    host, total inbound links and the most frequent anchor token
-    (ties lexicographic).  groupBy(host, anchor) then a per-host
-    window — the anchor vocabulary bounds the shuffle, and hosts are
-    the natural partition key at crawl scale."""
-    docs = _t(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    l = docs.select(
-        ((d * 3 + 1) % 40).alias("tgt"),
-        F.try_element_at(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != ""),
-            (d % 10 + 1).cast("int"),
-        ).alias("anchor"),  # try_: OOB -> NULL (ANSI element_at would abort the job)
-    ).filter(F.col("anchor").isNotNull())
-    c = l.groupBy("tgt", "anchor").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("tgt").orderBy(F.col("n").desc(), "anchor")
-    rk = c.withColumn("rn", F.row_number().over(w)).withColumn(
-        "total", F.sum("n").over(Window.partitionBy("tgt")))
-    return rk.filter(F.col("rn") == 1).select(
-        F.col("tgt").alias("host"),
-        F.col("total").alias("n_links"),
-        F.col("anchor").alias("top_anchor"),
-        F.col("n").alias("top_n"),
-    )
-
-
-@query(
-    "q208_waterfill_quota",
-    """WITH src AS (SELECT doc_id % 20 AS s, CAST(count(*) AS BIGINT) AS n
-              FROM documents GROUP BY doc_id % 20),
-       meta AS (SELECT CAST(count(*) AS BIGINT) AS nn,
-                       CAST(sum(n) AS BIGINT) AS total FROM src),
-       rk AS (SELECT s, n,
-                     row_number() OVER (ORDER BY n, s) AS i,
-                     sum(n) OVER (ORDER BY n, s) AS p
-              FROM src),
-       lv AS (SELECT i, n, p, CAST(p + n*(m.nn - i) AS BIGINT) AS fill, m.nn, m.total
-              FROM rk, meta m
-              UNION ALL
-              SELECT 0, CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                     m.nn, m.total FROM meta m),
-       pv AS (SELECT max_by(i, CASE WHEN fill <= 300 THEN i ELSE NULL END) AS pi
-              FROM lv WHERE fill <= 300),
-       cap AS (SELECT CASE WHEN m.total <= 300 THEN l.n
-                           ELSE l.n + CAST(((300 - l.fill)
-                                 - ((300 - l.fill) % greatest(m.nn - l.i, 1)))
-                                / greatest(m.nn - l.i, 1) AS BIGINT) END AS cap,
-                      CASE WHEN m.total <= 300 THEN CAST(0 AS BIGINT)
-                           ELSE CAST((300 - l.fill) % greatest(m.nn - l.i, 1) AS BIGINT)
-                      END AS r
-               FROM lv l, pv, meta m WHERE l.i = pv.pi),
-       extra AS (SELECT s, row_number() OVER (ORDER BY s) AS pos
-                 FROM src, cap c WHERE n > c.cap)
-       SELECT b.s, b.n,
-              CAST(least(b.n, c.cap)
-                   + CASE WHEN e.pos IS NOT NULL AND e.pos <= c.r
-                          THEN 1 ELSE 0 END AS BIGINT) AS quota
-       FROM src b LEFT JOIN extra e ON b.s = e.s, cap c""",
-)
-def q208(spark, sf_dir):
-    """Curriculum mixing quotas by integer WATERFILL (the mixture-cap
-    allocation a training pipeline runs before sampling), computed in
-    CLOSED FORM: sort sources by count, prefix-sum once — at the i-th
-    level the fill is P_i + n_i*(N-i), the pivot is the last level
-    under budget, and the cap extends arithmetically by exact floor
-    division (remainder +1 to the lowest source ids).  No candidate
-    enumeration anywhere, so the plan is one window + bounded 1-row
-    broadcasts regardless of how large per-source counts grow (the
-    earlier 0..max(n) sweep would not survive 10^12-doc sources).
-    Exact integers end-to-end; quotas sum to min(budget, total)."""
-    docs = _t(spark, sf_dir, "documents")
-    src = docs.groupBy((F.col("doc_id") % 20).alias("s")).agg(
-        F.count("*").alias("n")).persist()
-    meta = src.agg(F.count("*").alias("nn"), F.sum("n").alias("total"))
-    w = Window.orderBy("n", "s")
-    rk = src.select(
-        "s", "n",
-        F.row_number().over(w).alias("i"),
-        F.sum("n").over(w).alias("p"),
-    )
-    lv = rk.crossJoin(F.broadcast(meta)).select(
-        "i", "n", "p",
-        (F.col("p") + F.col("n") * (F.col("nn") - F.col("i"))).alias("fill"),
-        "nn", "total",
-    ).unionByName(
-        meta.select(
-            F.lit(0).alias("i"), F.lit(0).cast("long").alias("n"),
-            F.lit(0).cast("long").alias("p"), F.lit(0).cast("long").alias("fill"),
-            "nn", "total",
-        )
-    )
-    pv = lv.filter(F.col("fill") <= 300).agg(F.max("i").alias("pi"))
-    picked = lv.join(F.broadcast(pv), lv.i == pv.pi)
-    rem_budget = F.lit(300) - F.col("fill")
-    # slots can be 0 only on the total<=300 branch, but ANSI mode still
-    # evaluates the other branch's modulo — clamp the divisor
-    slots = F.greatest(F.col("nn") - F.col("i"), F.lit(1))
-    cap = picked.select(
-        F.when(F.col("total") <= 300, F.col("n")).otherwise(
-            F.col("n")
-            + ((rem_budget - rem_budget % slots) / slots).cast("long")
-        ).alias("cap"),
-        F.when(F.col("total") <= 300, F.lit(0).cast("long")).otherwise(
-            (rem_budget % slots).cast("long")
-        ).alias("r"),
-    )
-    withcap = src.crossJoin(F.broadcast(cap))
-    extra = withcap.filter(F.col("n") > F.col("cap")).select(
-        "s", F.row_number().over(Window.orderBy("s")).alias("pos"))
-    return (
-        withcap.join(extra, "s", "left")
-        .select(
-            "s", "n",
-            (F.least(F.col("n"), F.col("cap"))
-             + F.when(F.col("pos").isNotNull() & (F.col("pos") <= F.col("r")), 1)
-             .otherwise(0)).cast("long").alias("quota"),
-        )
-    )
-
-
 # --- streaming CDX revisit dedup (q209) ------------------------------------------
 
 
@@ -9319,6 +8015,7 @@ def q208(spark, sf_dir):
        SELECT url, CAST(count(*) AS BIGINT) AS n_unique,
               CAST(sum(digest) AS BIGINT) AS digest_sum
        FROM u GROUP BY url""",
+    kind="operator",
 )
 def q209(spark, sf_dir):
     """STREAMING CDX revisit dedup (the incremental form of q206): the
@@ -9351,185 +8048,6 @@ def q209(spark, sf_dir):
     )
 
 
-# --- MVT-style vector tile encode + GeoJSON export (q210-q211) --------------------
-
-
-@query(
-    "q210_mvt_point_tiles",
-    f"""WITH p AS ({POINTS_SQL}),
-       t AS (SELECT doc_id,
-                    CAST(floor((lon + 180.0)/360.0*256.0) AS BIGINT) AS tx,
-                    CAST(floor((90.0 - lat)/180.0*256.0) AS BIGINT) AS ty,
-                    ((lon + 180.0)/360.0*256.0) AS fx,
-                    ((90.0 - lat)/180.0*256.0) AS fy
-             FROM p),
-       q AS (SELECT doc_id, tx, ty,
-                    CAST(floor((fx - tx)*256.0) AS BIGINT) AS qx,
-                    CAST(floor((fy - ty)*256.0) AS BIGINT) AS qy
-             FROM t),
-       u AS (SELECT DISTINCT tx, ty, qx, qy FROM q)
-       SELECT u.tx, u.ty,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(sum(qx*256 + qy) AS BIGINT) AS cell_sum,
-              CAST((SELECT count(*) FROM q WHERE q.tx = u.tx AND q.ty = u.ty)
-                   AS BIGINT) AS n_points
-       FROM u GROUP BY u.tx, u.ty""",
-)
-def q210(spark, sf_dir):
-    """MVT-style vector-tile point encode (the OGR MVT driver's write
-    path, ogr/ogrsf_frmts/mvt: assign features to z8 tiles, quantize
-    to tile-local integer extent coordinates, collapse coincident
-    quantized points).  Per-tile groupBy is the natural shard; the
-    quantized-cell distinct bounds tile payloads by the extent², not
-    the feature count — exactly why MVT scales to dense layers."""
-    p = _points(spark, sf_dir)
-    fx = (F.col("lon") + 180.0) / 360.0 * 256.0
-    fy = (90.0 - F.col("lat")) / 180.0 * 256.0
-    t = p.select(
-        "doc_id",
-        F.floor(fx).cast("long").alias("tx"),
-        F.floor(fy).cast("long").alias("ty"),
-        fx.alias("fx"), fy.alias("fy"),
-    )
-    q = t.select(
-        "doc_id", "tx", "ty",
-        F.floor((F.col("fx") - F.col("tx")) * 256.0).cast("long").alias("qx"),
-        F.floor((F.col("fy") - F.col("ty")) * 256.0).cast("long").alias("qy"),
-    ).persist()  # feeds the distinct-cell agg AND the raw point counts
-    u = q.select("tx", "ty", "qx", "qy").distinct()
-    cells = u.groupBy("tx", "ty").agg(
-        F.count("*").alias("n_cells"),
-        F.sum(F.col("qx") * 256 + F.col("qy")).alias("cell_sum"),
-    )
-    pts = q.groupBy("tx", "ty").agg(F.count("*").alias("n_points"))
-    return cells.join(pts, ["tx", "ty"])
-
-
-@query(
-    "q211_geojson_export",
-    """WITH f AS (SELECT n_nationkey AS fid,
-              '{"type":"Feature","properties":{"fid":' || CAST(n_nationkey AS VARCHAR)
-              || '},"geometry":{"type":"Polygon","coordinates":[[['
-              || CAST((n_nationkey*61)%300 - 160 AS VARCHAR) || ','
-              || CAST((n_nationkey*83)%140 - 75 AS VARCHAR) || '],['
-              || CAST((n_nationkey*61)%300 - 160 + 10 + (n_nationkey%7)*5 AS VARCHAR) || ','
-              || CAST((n_nationkey*83)%140 - 75 AS VARCHAR) || '],['
-              || CAST((n_nationkey*61)%300 - 160 + 10 + (n_nationkey%7)*5 AS VARCHAR) || ','
-              || CAST((n_nationkey*83)%140 - 75 + 8 + (n_nationkey%5)*4 AS VARCHAR) || '],['
-              || CAST((n_nationkey*61)%300 - 160 AS VARCHAR) || ','
-              || CAST((n_nationkey*83)%140 - 75 + 8 + (n_nationkey%5)*4 AS VARCHAR) || '],['
-              || CAST((n_nationkey*61)%300 - 160 AS VARCHAR) || ','
-              || CAST((n_nationkey*83)%140 - 75 AS VARCHAR) || ']]]}}' AS feature
-       FROM nation)
-       SELECT fid, feature, CAST(length(feature) AS BIGINT) AS n_bytes FROM f""",
-)
-def q211(spark, sf_dir):
-    """GeoJSON feature export (the OGR GeoJSON writer,
-    ogr/ogrsf_frmts/geojson: RFC 7946 ring orientation CCW, closed
-    rings — first vertex repeated last): the zone rectangles emitted
-    as canonical Feature strings, built entirely in JVM string
-    expressions (integer coordinates render identically across
-    engines, which is exactly why OGR's own writer pins a precision).
-    Embarrassingly parallel string construction — an export sink, not
-    a shuffle."""
-    n = _t(spark, sf_dir, "nation")
-    k = F.col("n_nationkey")
-    x0 = ((k * 61) % 300 - 160).cast("long")
-    y0 = ((k * 83) % 140 - 75).cast("long")
-    x1 = (x0 + 10 + (k % 7) * 5).cast("long")
-    y1 = (y0 + 8 + (k % 5) * 4).cast("long")
-
-    def pt(x, y):
-        return F.concat(F.lit("["), x.cast("string"), F.lit(","),
-                        y.cast("string"), F.lit("]"))
-
-    # CCW exterior in lon/lat plane: (x0,y0) -> (x1,y0) -> (x1,y1) -> (x0,y1)
-    feature = F.concat(
-        F.lit('{"type":"Feature","properties":{"fid":'), k.cast("string"),
-        F.lit('},"geometry":{"type":"Polygon","coordinates":[['),
-        pt(x0, y0), F.lit(","), pt(x1, y0), F.lit(","), pt(x1, y1),
-        F.lit(","), pt(x0, y1), F.lit(","), pt(x0, y0),
-        F.lit("]]}}"),
-    )
-    return n.select(
-        k.alias("fid"),
-        feature.alias("feature"),
-        F.length(feature).cast("long").alias("n_bytes"),
-    )
-
-
-# --- curation decision-attribution matrix (q212) -----------------------------------
-
-
-@query(
-    "q212_curation_matrix",
-    """WITH idx AS (SELECT doc_id, text, lang,
-                      unnest(range(1, greatest(length(text) - 1, 2))) AS i
-                 FROM documents),
-       occ AS (SELECT doc_id, substr(text, CAST(i AS INT), 3) AS gram FROM idx
-               WHERE length(substr(text, CAST(i AS INT), 3)) = 3),
-       cf AS (SELECT gram, count(*) AS corpus_n FROM occ GROUP BY gram),
-       rare AS (SELECT o.doc_id,
-                       CAST(sum(CASE WHEN cf.corpus_n < 100 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n_rare,
-                       CAST(count(*) AS BIGINT) AS n_grams
-                FROM occ o JOIN cf USING (gram) GROUP BY o.doc_id),
-       dup AS (SELECT text, min(doc_id) AS keeper FROM documents GROUP BY text),
-       lab AS (SELECT d.doc_id, d.lang, length(d.text) AS n_chars,
-                      CASE WHEN 5*r.n_rare >= r.n_grams THEN 'low'
-                           ELSE 'high' END AS quality,
-                      CASE WHEN d.doc_id = u.keeper THEN 'keep'
-                           ELSE 'dup' END AS dedup
-               FROM documents d
-               JOIN rare r USING (doc_id)
-               JOIN dup u ON d.text = u.text)
-       SELECT lang, quality, dedup,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(n_chars) AS BIGINT) AS n_chars
-       FROM lab GROUP BY lang, quality, dedup""",
-)
-def q212(spark, sf_dir):
-    """Curation decision-attribution matrix (the 'what did the pipeline
-    keep and WHY' accounting a production run emits): every document
-    labeled on three independent axes — language, rare-gram quality
-    bucket (the q187 signal, thresholded at 20% with exact integer
-    cross-multiplication), exact-dup keeper status — in ONE lazy plan;
-    the output is the (lang × quality × dedup) contingency matrix with
-    document and char mass.  Shuffle shape: the gram-vocabulary
-    aggregation + one per-text dup groupBy + the final bounded matrix
-    aggregation — all crawl-shardable."""
-    docs = _t(spark, sf_dir, "documents")
-    occ = docs.select(
-        "doc_id",
-        F.explode(F.expr(
-            "filter(transform(sequence(1, greatest(length(text) - 2, 1)), "
-            "i -> substring(text, i, 3)), s -> length(s) = 3)"
-        )).alias("gram"),
-    ).persist()
-    cf = occ.groupBy("gram").agg(F.count("*").alias("corpus_n"))
-    rare = occ.join(cf, "gram").groupBy("doc_id").agg(
-        F.sum(F.when(F.col("corpus_n") < 100, 1).otherwise(0)).alias("n_rare"),
-        F.count("*").alias("n_grams"),
-    )
-    dup = docs.groupBy("text").agg(F.min("doc_id").alias("keeper"))
-    lab = (
-        docs.join(rare, "doc_id")
-        .join(dup, "text")
-        .select(
-            "lang",
-            F.length("text").alias("n_chars"),
-            F.when(5 * F.col("n_rare") >= F.col("n_grams"), "low")
-            .otherwise("high").alias("quality"),
-            F.when(F.col("doc_id") == F.col("keeper"), "keep")
-            .otherwise("dup").alias("dedup"),
-        )
-    )
-    return lab.groupBy("lang", "quality", "dedup").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("n_chars"),
-    )
-
-
 # --- incremental tile maintenance via append snapshots (q213) ---------------------
 
 
@@ -9540,6 +8058,7 @@ def q212(spark, sf_dir):
               CAST(floor((90.0 - lat)/180.0*64.0) AS BIGINT) AS ty,
               CAST(count(*) AS BIGINT) AS n
        FROM p GROUP BY 1, 2""",
+    kind="operator",
 )
 def q213(spark, sf_dir):
     """INCREMENTAL tile maintenance through Iceberg-style append
@@ -9577,173 +8096,6 @@ def q213(spark, sf_dir):
     )
 
 
-# --- histogram equalization, gdalenhance (q214) ------------------------------------
-
-
-@query(
-    "q214_hist_equalize",
-    f"""WITH g AS (SELECT gx.range AS gx, gy.range AS gy
-                   FROM range(128) gx, range(128) gy),
-       px AS (SELECT gx, gy, CAST({_z_sql('gx', 'gy')} AS BIGINT) AS v FROM g),
-       h AS (SELECT v, count(*) AS c FROM px GROUP BY v),
-       cdf AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM h),
-       m AS (SELECT min(cum) AS cmin, CAST(128*128 AS BIGINT) AS n FROM cdf),
-       lut AS (SELECT v,
-                      CAST(((cum - m.cmin)*255
-                            - (((cum - m.cmin)*255) % (m.n - m.cmin)))
-                           / (m.n - m.cmin) AS BIGINT) AS eq
-               FROM cdf, m)
-       SELECT l.eq,
-              CAST(count(*) AS BIGINT) AS n_px,
-              CAST(min(p.v) AS BIGINT) AS v_lo,
-              CAST(max(p.v) AS BIGINT) AS v_hi
-       FROM px p JOIN lut l USING (v) GROUP BY l.eq""",
-)
-def q214(spark, sf_dir):
-    """Histogram equalization (apps/gdalenhance.cpp): per-value counts
-    → cumulative distribution → the classic integer LUT
-    eq(v) = floor((cdf(v) - cdf_min) * 255 / (N - cdf_min)).
-    All-integer floor division keeps both engines bitwise; the LUT is
-    bounded by the value range and broadcast back onto the pixel table
-    — one histogram pass + one broadcast join at any raster size.
-    Output: the equalized histogram with each bin's source value span
-    (equalization must be monotone, so spans are disjoint)."""
-    g = spark.range(128).select(F.col("id").alias("gx")).crossJoin(
-        spark.range(128).select(F.col("id").alias("gy")))
-    px = g.select(
-        "gx", "gy",
-        ((F.col("gx") * 7 + F.col("gy") * 13) % 97
-         + (F.col("gx") * F.col("gx")) % 23).cast("long").alias("v"),
-    )
-    h = px.groupBy("v").agg(F.count("*").alias("c"))
-    cdf = h.withColumn("cum", F.sum("c").over(Window.orderBy("v"))).select("v", "cum")
-    m = cdf.agg(F.min("cum").alias("cmin"), F.lit(128 * 128).cast("long").alias("n"))
-    num = (F.col("cum") - F.col("cmin")) * 255
-    den = F.col("n") - F.col("cmin")
-    lut = cdf.crossJoin(F.broadcast(m)).select(
-        "v", ((num - num % den) / den).cast("long").alias("eq"))
-    return (
-        px.join(F.broadcast(lut), "v")
-        .groupBy("eq")
-        .agg(
-            F.count("*").alias("n_px"),
-            F.min("v").alias("v_lo"),
-            F.max("v").alias("v_hi"),
-        )
-    )
-
-
-# --- alpha-shape concave hull (q215) -------------------------------------------------
-
-_ASHAPE_PTS_SQL = """pts AS (SELECT CAST(k.range AS BIGINT) AS k,
-                      CAST((k.range*k.range*7 + 3*k.range) % 37 AS BIGINT) AS x,
-                      CAST((k.range*k.range*11 + 5*k.range) % 31 AS BIGINT) AS y
-               FROM range(0, 14) k)"""
-
-
-@query(
-    "q215_concave_hull_alpha",
-    f"""WITH {_ASHAPE_PTS_SQL},
-       tri AS (SELECT a.k AS ka, a.x AS ax, a.y AS ay,
-                      b.k AS kb, b.x AS bx, b.y AS by,
-                      c.k AS kc, c.x AS cx, c.y AS cy,
-                      (b.x-a.x)*(c.y-a.y) - (b.y-a.y)*(c.x-a.x) AS o
-               FROM pts a, pts b, pts c
-               WHERE a.k < b.k AND b.k < c.k),
-       del AS (SELECT t.* FROM tri t
-               WHERE NOT EXISTS (
-                 SELECT 1 FROM pts d
-                 WHERE d.k NOT IN (t.ka, t.kb, t.kc)
-                   AND t.o * (
-                     (t.ax-d.x)*(((t.by-d.y)*(((t.cx-d.x)*(t.cx-d.x)+(t.cy-d.y)*(t.cy-d.y))))
-                                 - (((t.bx-d.x)*(t.bx-d.x)+(t.by-d.y)*(t.by-d.y)))*(t.cy-d.y))
-                     - (t.ay-d.y)*(((t.bx-d.x)*(((t.cx-d.x)*(t.cx-d.x)+(t.cy-d.y)*(t.cy-d.y))))
-                                 - (((t.bx-d.x)*(t.bx-d.x)+(t.by-d.y)*(t.by-d.y)))*(t.cx-d.x))
-                     + (((t.ax-d.x)*(t.ax-d.x)+(t.ay-d.y)*(t.ay-d.y)))
-                       *((t.bx-d.x)*(t.cy-d.y) - (t.by-d.y)*(t.cx-d.x))
-                   ) >= 0)),
-       kept AS (SELECT * FROM del
-                WHERE ((ax-bx)*(ax-bx)+(ay-by)*(ay-by))
-                    * ((bx-cx)*(bx-cx)+(by-cy)*(by-cy))
-                    * ((cx-ax)*(cx-ax)+(cy-ay)*(cy-ay))
-                    <= 120 * 4 * o * o),
-       edges AS (SELECT least(ka, kb) AS k1, greatest(ka, kb) AS k2 FROM kept
-                 UNION ALL SELECT least(kb, kc), greatest(kb, kc) FROM kept
-                 UNION ALL SELECT least(ka, kc), greatest(ka, kc) FROM kept),
-       bnd AS (SELECT k1, k2 FROM edges GROUP BY k1, k2 HAVING count(*) = 1)
-       SELECT p1.x AS x1, p1.y AS y1, p2.x AS x2, p2.y AS y2
-       FROM bnd JOIN pts p1 ON p1.k = bnd.k1 JOIN pts p2 ON p2.k = bnd.k2""",
-)
-def q215(spark, sf_dir):
-    """Concave hull as an ALPHA SHAPE (apps/gdalalg_vector_concave_hull
-    .cpp; GEOS concaveHull): Delaunay facets by the exact brute
-    incircle criterion (the same spec as operators/grid.py's
-    delaunay_triangles — integer determinants, general-position
-    fixture), keep triangles with circumradius² <= alpha² via the
-    cross-multiplied integer test a²b²c² <= 4*alpha²*S², and the hull
-    is the edges on exactly ONE kept triangle.  Per feature group the
-    point set is bounded (here 14 points, 364 triples), so the triple
-    join broadcasts; across a corpus, one group per task — the same
-    distribution axis as the TIN gridder."""
-    k = F.col("id")
-    pts = spark.range(14).select(
-        k.alias("k"),
-        ((k * k * 7 + 3 * k) % 37).cast("long").alias("x"),
-        ((k * k * 11 + 5 * k) % 31).cast("long").alias("y"),
-    )
-    a = pts.select(F.col("k").alias("ka"), F.col("x").alias("ax"), F.col("y").alias("ay"))
-    b = pts.select(F.col("k").alias("kb"), F.col("x").alias("bx"), F.col("y").alias("by"))
-    c = pts.select(F.col("k").alias("kc"), F.col("x").alias("cx"), F.col("y").alias("cy"))
-    tri = (
-        a.crossJoin(F.broadcast(b)).filter(F.col("ka") < F.col("kb"))
-        .crossJoin(F.broadcast(c)).filter(F.col("kb") < F.col("kc"))
-        .withColumn(
-            "o",
-            (F.col("bx") - F.col("ax")) * (F.col("cy") - F.col("ay"))
-            - (F.col("by") - F.col("ay")) * (F.col("cx") - F.col("ax")),
-        )
-    )
-    d = pts.select(F.col("k").alias("kd"), F.col("x").alias("dx"), F.col("y").alias("dy"))
-    C = F.col
-
-    def sq(u, v):
-        return u * u + v * v
-
-    r1x, r1y = C("ax") - C("dx"), C("ay") - C("dy")
-    r2x, r2y = C("bx") - C("dx"), C("by") - C("dy")
-    r3x, r3y = C("cx") - C("dx"), C("cy") - C("dy")
-    det = (
-        r1x * (r2y * sq(r3x, r3y) - sq(r2x, r2y) * r3y)
-        - r1y * (r2x * sq(r3x, r3y) - sq(r2x, r2y) * r3x)
-        + sq(r1x, r1y) * (r2x * r3y - r2y * r3x)
-    )
-    checks = (
-        tri.crossJoin(F.broadcast(d))
-        .filter((C("kd") != C("ka")) & (C("kd") != C("kb")) & (C("kd") != C("kc")))
-        .withColumn("bad", (C("o") * det >= 0).cast("int"))
-        .groupBy("ka", "kb", "kc", "ax", "ay", "bx", "by", "cx", "cy", "o")
-        .agg(F.max("bad").alias("anybad"))
-    )
-    dele = checks.filter(F.col("anybad") == 0)
-    e2 = lambda ux, uy, vx, vy: sq(C(ux) - C(vx), C(uy) - C(vy))
-    kept = dele.filter(
-        e2("ax", "ay", "bx", "by") * e2("bx", "by", "cx", "cy")
-        * e2("cx", "cy", "ax", "ay")
-        <= 120 * 4 * C("o") * C("o")
-    )
-    edges = None
-    for u, v in (("ka", "kb"), ("kb", "kc"), ("ka", "kc")):
-        part = kept.select(
-            F.least(C(u), C(v)).alias("k1"), F.greatest(C(u), C(v)).alias("k2"))
-        edges = part if edges is None else edges.unionByName(part)
-    bnd = edges.groupBy("k1", "k2").agg(F.count("*").alias("cnt")).filter(
-        F.col("cnt") == 1)
-    p1 = pts.select(F.col("k").alias("k1"), F.col("x").alias("x1"), F.col("y").alias("y1"))
-    p2 = pts.select(F.col("k").alias("k2"), F.col("x").alias("x2"), F.col("y").alias("y2"))
-    return bnd.join(F.broadcast(p1), "k1").join(F.broadcast(p2), "k2").select(
-        "x1", "y1", "x2", "y2")
-
-
 # --- nearblack collar removal (q216) --------------------------------------------------
 
 # fixture: dark frame (width 2-3, value 2) + a dark INTERIOR pond (value
@@ -9774,6 +8126,7 @@ _NB_V_SQL = (
               CAST((SELECT count(*) FROM dark) -
                    (SELECT count(*) FROM reach) AS BIGINT) AS n_kept_dark,
               CAST((SELECT sum(gx + 32*gy) FROM reach) AS BIGINT) AS collar_sum""",
+    kind="operator",
 )
 def q216(spark, sf_dir):
     """nearblack / raster clean-collar (apps/nearblack_lib.cpp +
@@ -9828,226 +8181,6 @@ def q216(spark, sf_dir):
     )
 
 
-# --- linear referencing, ogrlineref (q217) ------------------------------------------
-
-
-_LINEREF_SEG_SQL = """g AS (SELECT l.range AS l, i.range AS i FROM range(4) l, range(8) i),
-       segc AS (SELECT l, i, 1 + (i + 2*l + i*l) % 3 AS c FROM g),
-       seg AS (SELECT l, i,
-                      CASE WHEN i % 2 = 0 THEN 4*c ELSE 3*c END AS dx,
-                      CASE WHEN i % 2 = 0 THEN 3*c ELSE -4*c END AS dy,
-                      5*c AS len
-               FROM segc),
-       seg2 AS (SELECT l, i, dx, dy, len,
-                       COALESCE(sum(dx) OVER (PARTITION BY l ORDER BY i
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS x1,
-                       20*l + COALESCE(sum(dy) OVER (PARTITION BY l ORDER BY i
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS y1,
-                       COALESCE(sum(len) OVER (PARTITION BY l ORDER BY i
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum0
-                FROM seg)"""
-
-
-def _lineref_segments(spark):
-    """Shared fixture: 4 polylines x 8 segments with 3-4-5 integer
-    steps, so every segment length (5c) and every cumulative milepost
-    is an exact integer on both engines."""
-    g = spark.range(4).select(F.col("id").alias("l")).crossJoin(
-        spark.range(8).select(F.col("id").alias("i")))
-    c = 1 + (F.col("i") + 2 * F.col("l") + F.col("i") * F.col("l")) % 3
-    seg = g.select(
-        "l", "i",
-        F.when(F.col("i") % 2 == 0, 4 * c).otherwise(3 * c).alias("dx"),
-        F.when(F.col("i") % 2 == 0, 3 * c).otherwise(-4 * c).alias("dy"),
-        (5 * c).alias("len"),
-    )
-    w = Window.partitionBy("l").orderBy("i").rowsBetween(Window.unboundedPreceding, -1)
-    return seg.select(
-        "l", "i", "dx", "dy", "len",
-        F.coalesce(F.sum("dx").over(w), F.lit(0)).alias("x1"),
-        (20 * F.col("l") + F.coalesce(F.sum("dy").over(w), F.lit(0))).alias("y1"),
-        F.coalesce(F.sum("len").over(w), F.lit(0)).alias("cum0"),
-    )
-
-
-@query(
-    "q217_lineref_coord",
-    f"""WITH {_LINEREF_SEG_SQL},
-       dist AS (SELECT l.range AS l, 6*j.range AS d FROM range(4) l, range(30) j)
-       SELECT CAST(dist.l AS BIGINT) AS l,
-              CAST(dist.d AS BIGINT) AS d,
-              CAST(seg2.i AS BIGINT) AS seg,
-              x1 + ((dist.d - cum0) * dx) / len AS px,
-              y1 + ((dist.d - cum0) * dy) / len AS py
-       FROM dist JOIN seg2 ON dist.l = seg2.l
-        AND dist.d >= seg2.cum0 AND dist.d < seg2.cum0 + seg2.len""",
-)
-def q217(spark, sf_dir):
-    """Linear referencing, get_coord mode (apps/ogrlineref.cpp:46
-    op_get_coord via OGRLineString::Value, ogr/ogrlinestring.cpp):
-    the point at distance d along a polyline.  Polylines decompose to
-    a segment table with windowed integer cumulative mileposts
-    (3-4-5 steps keep every length exact); each requested distance is
-    an interval join cum0 <= d < cum0+len, then one exact linear
-    interpolation inside the segment.  At corpus scale the interval
-    join buckets by milepost range per line (the q30 range-join
-    pattern); mileposts are computed once per line, not per request."""
-    seg2 = _lineref_segments(spark)
-    dist = spark.range(4).select(F.col("id").alias("dl")).crossJoin(
-        spark.range(30).select((F.col("id") * 6).alias("d")))
-    j = dist.join(
-        F.broadcast(seg2),
-        (F.col("dl") == F.col("l"))
-        & (F.col("d") >= F.col("cum0"))
-        & (F.col("d") < F.col("cum0") + F.col("len")),
-    )
-    return j.select(
-        F.col("l").cast("long").alias("l"),
-        F.col("d").cast("long").alias("d"),
-        F.col("i").cast("long").alias("seg"),
-        (F.col("x1") + (F.col("d") - F.col("cum0")) * F.col("dx") / F.col("len")).alias("px"),
-        (F.col("y1") + (F.col("d") - F.col("cum0")) * F.col("dy") / F.col("len")).alias("py"),
-    )
-
-
-# --- color ramp + palette expansion, pct2rgb (q218) ---------------------------------
-
-
-@query(
-    "q218_pct2rgb_ramp",
-    """WITH idx AS (SELECT k.range AS k FROM range(16) k),
-       lut AS (SELECT k,
-                      CASE WHEN k < 7
-                           THEN floor(k * ((250 - 10) / 7.0) + 10)
-                           ELSE floor((k - 7) * ((20 - 250) / 8.0) + 250) END AS r,
-                      CASE WHEN k < 7
-                           THEN floor(k * ((40 - 200) / 7.0) + 200)
-                           ELSE floor((k - 7) * ((220 - 40) / 8.0) + 40) END AS g,
-                      CASE WHEN k < 7
-                           THEN floor(k * ((90 - 30) / 7.0) + 30)
-                           ELSE floor((k - 7) * ((180 - 90) / 8.0) + 90) END AS b
-               FROM idx),
-       px AS (SELECT gx.range AS gx, gy.range AS gy,
-                     (gx.range*gx.range*3 + gy.range*7 + gx.range*gy.range) % 16 AS k
-              FROM range(96) gx, range(96) gy)
-       SELECT CAST(px.k AS BIGINT) AS k,
-              CAST(lut.r AS BIGINT) AS r,
-              CAST(lut.g AS BIGINT) AS g,
-              CAST(lut.b AS BIGINT) AS b,
-              CAST(count(*) AS BIGINT) AS n_px,
-              CAST(sum(px.gx + 96*px.gy) AS BIGINT) AS pos_sum
-       FROM px JOIN lut ON px.k = lut.k
-       GROUP BY px.k, lut.r, lut.g, lut.b""",
-)
-def q218(spark, sf_dir):
-    """Palette-indexed raster -> RGB expansion (pct2rgb:
-    swig/python/gdal-utils/osgeo_utils/pct2rgb.py) with the color
-    table built by GDALColorTable::CreateColorRamp
-    (gcore/gdalcolortable.cpp:364-418): entry(start+i) =
-    trunc(i * ((c_end - c_start)/nColors) + c_start) per channel —
-    the exact double slope formula is replicated verbatim (floor ==
-    C short-cast for the in-gamut non-negative results).  Two chained
-    ramps (0->7, 7->15, the second overwriting index 7 as SetColorEntry
-    does) form the 16-entry LUT; expansion is one broadcast hash join
-    onto the pixel table — the palette is O(256) rows at any raster
-    size, so pct2rgb never shuffles the pixels.  pos_sum proves the
-    join touched every pixel."""
-    idx = spark.range(16).select(F.col("id").alias("k"))
-
-    def ramp(lo_i, lo_c, hi_i, hi_c):
-        n = float(hi_i - lo_i)
-        return F.floor(
-            (F.col("k") - F.lit(lo_i)) * F.lit((hi_c - lo_c) / n) + F.lit(float(lo_c))
-        )
-
-    def chan(lo1, hi1, hi2):
-        return F.when(F.col("k") < 7, ramp(0, lo1, 7, hi1)).otherwise(
-            ramp(7, hi1, 15, hi2))
-
-    lut = idx.select(
-        "k",
-        chan(10, 250, 20).alias("r"),
-        chan(200, 40, 220).alias("g"),
-        chan(30, 90, 180).alias("b"),
-    )
-    g = spark.range(96).select(F.col("id").alias("gx")).crossJoin(
-        spark.range(96).select(F.col("id").alias("gy")))
-    px = g.select(
-        "gx", "gy",
-        ((F.col("gx") * F.col("gx") * 3 + F.col("gy") * 7
-          + F.col("gx") * F.col("gy")) % 16).alias("k"),
-    )
-    return (
-        px.join(F.broadcast(lut), "k")
-        .groupBy("k", "r", "g", "b")
-        .agg(
-            F.count("*").cast("long").alias("n_px"),
-            F.sum(F.col("gx") + 96 * F.col("gy")).cast("long").alias("pos_sum"),
-        )
-        .select(
-            F.col("k").cast("long").alias("k"),
-            F.col("r").cast("long").alias("r"),
-            F.col("g").cast("long").alias("g"),
-            F.col("b").cast("long").alias("b"),
-            "n_px", "pos_sum",
-        )
-    )
-
-
-# --- golden-image comparison, gdalcompare (q219) ------------------------------------
-
-
-@query(
-    "q219_gdalcompare",
-    """WITH g AS (SELECT b.range AS band, gx.range AS gx, gy.range AS gy
-                  FROM range(3) b, range(128) gx, range(128) gy),
-       px AS (SELECT band, gx, gy,
-                     (gx*7 + gy*11 + band*29 + (gx*gy) % 13) % 251 AS gold,
-                     (gx*7 + gy*11 + band*29 + (gx*gy) % 13) % 251
-                     + CASE WHEN (gx*31 + gy*17 + band) % 997 < 2
-                            THEN 1 + (gx + gy + band) % 5 ELSE 0 END AS test
-              FROM g)
-       SELECT CAST(band AS BIGINT) AS band,
-              CAST(sum(CASE WHEN gold <> test THEN 1 ELSE 0 END) AS BIGINT) AS n_diff,
-              CAST(max(abs(test - gold)) AS BIGINT) AS max_diff,
-              CAST(sum(abs(test - gold)) AS BIGINT) AS sum_diff,
-              CAST(CASE WHEN sum(CASE WHEN gold <> test THEN 1 ELSE 0 END) = 0
-                        THEN 1 ELSE 0 END AS BIGINT) AS identical
-       FROM px GROUP BY band""",
-)
-def q219(spark, sf_dir):
-    """Golden-image regression compare (gdalcompare:
-    swig/python/gdal-utils/osgeo_utils/gdalcompare.py compare_band —
-    per-band difference count, max abs pixel delta, and the
-    identical/not verdict the autotest suite gates releases on).
-    Both rasters derive from the same integer field; the test band
-    injects a sparse deterministic perturbation.  One partial-agg
-    scan per band pair — compare of two 100-TB images is a single
-    co-partitioned zip (same tile grid -> join on tile key, NumPy
-    diff per tile), never a collect."""
-    g = (
-        spark.range(3).select(F.col("id").alias("band"))
-        .crossJoin(spark.range(128).select(F.col("id").alias("gx")))
-        .crossJoin(spark.range(128).select(F.col("id").alias("gy")))
-    )
-    gold = (F.col("gx") * 7 + F.col("gy") * 11 + F.col("band") * 29
-            + (F.col("gx") * F.col("gy")) % 13) % 251
-    bump = F.when(
-        (F.col("gx") * 31 + F.col("gy") * 17 + F.col("band")) % 997 < 2,
-        1 + (F.col("gx") + F.col("gy") + F.col("band")) % 5,
-    ).otherwise(F.lit(0))
-    px = g.select("band", gold.alias("gold"), (gold + bump).alias("test"))
-    d = F.abs(F.col("test") - F.col("gold"))
-    ndiff = F.sum(F.when(F.col("gold") != F.col("test"), 1).otherwise(0))
-    return px.groupBy("band").agg(
-        ndiff.cast("long").alias("n_diff"),
-        F.max(d).cast("long").alias("max_diff"),
-        F.sum(d).cast("long").alias("sum_diff"),
-        F.when(ndiff == 0, 1).otherwise(0).cast("long").alias("identical"),
-    ).select(F.col("band").cast("long").alias("band"),
-             "n_diff", "max_diff", "sum_diff", "identical")
-
-
 # --- composition blend modes, gdal raster blend (q220) ------------------------------
 
 from gdal_spark.functions import blend as BL  # noqa: E402
@@ -10097,7 +8230,7 @@ def _blend_oracle_sql() -> str:
     )
 
 
-@query("q220_blend_modes", _blend_oracle_sql())
+@query("q220_blend_modes", _blend_oracle_sql(), kind="operator")
 def q220(spark, sf_dir):
     """All 8 separable composition modes of ``gdal raster blend``
     (apps/gdalalg_raster_blend.cpp BlendMultiply/Screen/Overlay/
@@ -10156,6 +8289,7 @@ _RC_V = ("(CASE WHEN (gx + gy) % 17 = 0 THEN -999 "
         px AS (SELECT gx, gy, CAST({_RC_V} AS DOUBLE) AS v FROM g)
         SELECT gx, gy, {interval_case_sql(_RC_MAPPING, 'v')} AS out
         FROM px""",
+    kind="operator",
 )
 def q221(spark, sf_dir):
     """``gdal raster reclassify`` mapping language
@@ -10192,6 +8326,7 @@ from gdal_spark.operators.translate import power_scale_col  # noqa: E402
                           WHEN (v - 0.0) / 256.0 > 1.0 THEN 1.0
                           ELSE (v - 0.0) / 256.0 END AS p FROM px)
        SELECT gx, gy, v, 1024.0 * (p * p) + 10.0 AS out FROM pv""",
+    kind="operator",
 )
 def q222(spark, sf_dir):
     """``gdal raster scale`` with ``-exponent 2`` (power scaling,
@@ -10212,102 +8347,6 @@ def q222(spark, sf_dir):
     return px.select(
         "gx", "gy", "v",
         power_scale_col(F.col("v"), 0.0, 256.0, 10.0, 1034.0, 2).alias("out"),
-    )
-
-
-# --- point sample, gdallocationinfo / gdal raster pixel-info (q223) -----------------
-
-
-@query(
-    "q223_pixel_info",
-    """WITH pts AS (SELECT doc_id, ((doc_id*9973)%36000)/100.0 - 180.0 AS lon,
-                           ((doc_id*7919)%16000)/100.0 - 80.0 AS lat
-                    FROM documents WHERE doc_id % 7 = 0),
-       loc AS (SELECT doc_id, lon, lat,
-                      CAST(floor((lon - (-180.0)) / 0.5) AS BIGINT) AS px,
-                      CAST(floor((lat - 90.0) / (-0.5)) AS BIGINT) AS ly
-               FROM pts),
-       rast AS (SELECT x.range AS px, y.range AS ly,
-                       (x.range*31 + y.range*17) % 1000 AS val
-                FROM range(128) x, range(128) y)
-       SELECT l.doc_id, l.px, l.ly,
-              CAST(CASE WHEN r.val IS NULL THEN 0 ELSE 1 END AS BIGINT)
-                  AS inside,
-              r.val AS val
-       FROM loc l LEFT JOIN rast r ON l.px = r.px AND l.ly = r.ly""",
-)
-def q223(spark, sf_dir):
-    """``gdallocationinfo`` / ``gdal raster pixel-info``
-    (apps/gdallocationinfo.cpp): invert the (north-up) geotransform —
-    pixel = floor((x - x0)/dx), line = floor((y - y0)/dy) — and report
-    the band value, NULL + inside=0 for points outside the raster
-    ("located outside" in the tool's report).  Shape at 100 TB: the
-    POINT side broadcasts into an equi-join against the tiled pixel
-    table keyed by (pixel, line) — partition-prunable when the raster
-    is tile-partitioned; no Python anywhere."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)
-    pts = d.select(
-        "doc_id",
-        (((F.col("doc_id") * 9973) % 36000) / 100.0 - 180.0).alias("lon"),
-        (((F.col("doc_id") * 7919) % 16000) / 100.0 - 80.0).alias("lat"),
-    )
-    loc = pts.select(
-        "doc_id",
-        F.floor((F.col("lon") - (-180.0)) / 0.5).cast("long").alias("px"),
-        F.floor((F.col("lat") - 90.0) / (-0.5)).cast("long").alias("ly"),
-    )
-    rast = (
-        spark.range(128).select(F.col("id").alias("px"))
-        .crossJoin(spark.range(128).select(F.col("id").alias("ly")))
-        .select("px", "ly",
-                ((F.col("px") * 31 + F.col("ly") * 17) % 1000).alias("val"))
-    )
-    j = loc.join(F.broadcast(rast), ["px", "ly"], "left")
-    return j.select(
-        "doc_id", "px", "ly",
-        F.when(F.col("val").isNull(), 0).otherwise(1).cast("long")
-            .alias("inside"),
-        "val",
-    )
-
-
-# --- raster to xyz export, gdal2xyz (q224) ------------------------------------------
-
-
-@query(
-    "q224_raster_xyz",
-    """WITH g AS (SELECT x.range AS px, y.range AS ly
-                  FROM range(96) x, range(96) y),
-       bands AS (SELECT px, ly,
-                        (px*13 + ly*29) % 251 AS b1,
-                        (px*5 + ly*3 + 7) % 251 AS b2
-                 FROM g)
-       SELECT -180.0 + (px + 0.5) * 0.25 AS x,
-              90.0 + (ly + 0.5) * (-0.25) AS y,
-              CAST(b1 AS BIGINT) AS b1, CAST(b2 AS BIGINT) AS b2
-       FROM bands WHERE b1 <> 0""",
-)
-def q224(spark, sf_dir):
-    """``gdal2xyz`` (swig/python/gdal-utils/osgeo_utils/gdal2xyz.py):
-    every pixel becomes one (x, y, band1, band2, ...) row with CENTER
-    coordinates x0+(px+0.5)*dx, and -skipnodata drops rows whose first
-    band equals the nodata value (0 here).  Dyadic dx=0.25 keeps the
-    centers float-exact.  Pure projection + filter over the pixel
-    table — the export IS the scan, no shuffle."""
-    g = (
-        spark.range(96).select(F.col("id").alias("px"))
-        .crossJoin(spark.range(96).select(F.col("id").alias("ly")))
-    )
-    bands = g.select(
-        "px", "ly",
-        ((F.col("px") * 13 + F.col("ly") * 29) % 251).alias("b1"),
-        ((F.col("px") * 5 + F.col("ly") * 3 + 7) % 251).alias("b2"),
-    )
-    return bands.filter(F.col("b1") != 0).select(
-        (F.lit(-180.0) + (F.col("px") + 0.5) * 0.25).alias("x"),
-        (F.lit(90.0) + (F.col("ly") + 0.5) * (-0.25)).alias("y"),
-        F.col("b1").cast("long").alias("b1"),
-        F.col("b2").cast("long").alias("b2"),
     )
 
 
@@ -10363,6 +8402,7 @@ from gdal_spark.operators.coverage import check_coverage  # noqa: E402
                   AS invalid_len
        FROM r LEFT JOIN marked m ON m.id = r.id
        GROUP BY r.id""",
+    kind="operator",
 )
 def q225(spark, sf_dir):
     """``gdal vector check-coverage``
@@ -10386,208 +8426,6 @@ def q225(spark, sf_dir):
         (F.floor(F.col("id") / 5) * 4 + 4).cast("long").alias("y1"),
     )
     return check_coverage(rects, (0, 0, 20, 20))
-
-
-# --- Delaunay triangulation surface, ST_DelaunayTriangles (q226) --------------------
-
-
-@query(
-    "q226_delaunay_triangles",
-    """WITH p AS (SELECT k.range AS id, (k.range*37) % 97 AS x,
-                         (k.range*61) % 89 AS y
-                  FROM range(20) k)
-       SELECT a.id AS ia, b.id AS ib, c.id AS ic
-       FROM p a, p b, p c
-       WHERE a.id < b.id AND b.id < c.id
-         AND (b.x - a.x)*(c.y - a.y) - (b.y - a.y)*(c.x - a.x) <> 0
-         AND NOT EXISTS (
-           SELECT 1 FROM p d
-           WHERE d.id <> a.id AND d.id <> b.id AND d.id <> c.id
-             AND ((b.x - a.x)*(c.y - a.y) - (b.y - a.y)*(c.x - a.x))
-                 * ( (a.x - d.x) * ((b.y - d.y)
-                         * ((c.x - d.x)*(c.x - d.x)
-                            + (c.y - d.y)*(c.y - d.y))
-                       - (c.y - d.y)
-                         * ((b.x - d.x)*(b.x - d.x)
-                            + (b.y - d.y)*(b.y - d.y)))
-                   - (a.y - d.y) * ((b.x - d.x)
-                         * ((c.x - d.x)*(c.x - d.x)
-                            + (c.y - d.y)*(c.y - d.y))
-                       - (c.x - d.x)
-                         * ((b.x - d.x)*(b.x - d.x)
-                            + (b.y - d.y)*(b.y - d.y)))
-                   + ((a.x - d.x)*(a.x - d.x) + (a.y - d.y)*(a.y - d.y))
-                     * ((b.x - d.x)*(c.y - d.y) - (c.x - d.x)*(b.y - d.y))
-                 ) > 0)""",
-)
-def q226(spark, sf_dir):
-    """ST_DelaunayTriangles / GDALTriangulationCreateDelaunay
-    (alg/delaunay.c; ogr SQLite dialect DelaunayTriangulation): emit
-    every Delaunay facet of an integer point set by the DEFINING
-    property — (a,b,c) is a facet iff no other point lies strictly
-    inside its circumcircle — as a fully distributed plan: broadcast
-    triple enumeration filtered by an exact int64 incircle
-    determinant, candidates anti-joined against violating points.
-    The same exact predicate as operators/grid.delaunay_triangles
-    (the TIN kernel), here evaluated relationally so the facet test
-    shards over the cluster instead of one driver loop."""
-    p = spark.range(20).select(
-        F.col("id"),
-        ((F.col("id") * 37) % 97).alias("x"),
-        ((F.col("id") * 61) % 89).alias("y"),
-    )
-    a = p.select(F.col("id").alias("ia"), F.col("x").alias("ax"),
-                 F.col("y").alias("ay"))
-    b = p.select(F.col("id").alias("ib"), F.col("x").alias("bx"),
-                 F.col("y").alias("by"))
-    c = p.select(F.col("id").alias("ic"), F.col("x").alias("cx"),
-                 F.col("y").alias("cy"))
-    tri = (
-        a.crossJoin(b).filter(F.col("ia") < F.col("ib"))
-        .crossJoin(c).filter(F.col("ib") < F.col("ic"))
-    )
-    orient = (
-        (F.col("bx") - F.col("ax")) * (F.col("cy") - F.col("ay"))
-        - (F.col("by") - F.col("ay")) * (F.col("cx") - F.col("ax"))
-    )
-    tri = tri.filter(orient != 0).withColumn("o", orient)
-    d = p.select(F.col("id").alias("idd"), F.col("x").alias("dx"),
-                 F.col("y").alias("dy"))
-    r1x = F.col("ax") - F.col("dx"); r1y = F.col("ay") - F.col("dy")
-    r2x = F.col("bx") - F.col("dx"); r2y = F.col("by") - F.col("dy")
-    r3x = F.col("cx") - F.col("dx"); r3y = F.col("cy") - F.col("dy")
-    c1 = r1x * r1x + r1y * r1y
-    c2 = r2x * r2x + r2y * r2y
-    c3 = r3x * r3x + r3y * r3y
-    det = (
-        r1x * (r2y * c3 - r3y * c2)
-        - r1y * (r2x * c3 - r3x * c2)
-        + c1 * (r2x * r3y - r3x * r2y)
-    )
-    viol = (
-        (F.col("idd") != F.col("ia"))
-        & (F.col("idd") != F.col("ib"))
-        & (F.col("idd") != F.col("ic"))
-        & (F.col("o") * det > 0)
-    )
-    return (
-        tri.join(F.broadcast(d), viol, "left_anti")
-        .select("ia", "ib", "ic")
-    )
-
-
-# --- focal neighborhood statistics, gdal raster neighbors (q227) --------------------
-
-
-@query(
-    "q227_raster_neighbors",
-    """WITH t AS (SELECT x.range AS tx, y.range AS ty
-                  FROM range(1, 39) x, range(1, 39) y),
-       off AS (SELECT dy.range - 1 AS dy, dx.range - 1 AS dx
-               FROM range(3) dy, range(3) dx),
-       cells AS (
-         SELECT t.tx, t.ty,
-                (o.dy + 1) * 3 + (o.dx + 1) AS scanpos,
-                CASE WHEN o.dy = 0 AND o.dx = 0 THEN 4
-                     WHEN o.dy = 0 OR o.dx = 0 THEN 2 ELSE 1 END AS coef,
-                ((t.tx + o.dx) * 7 + (t.ty + o.dy) * 13
-                 + ((t.tx + o.dx) * (t.ty + o.dy)) % 5) % 97 AS v
-         FROM t, off o),
-       ranked AS (
-         SELECT *, row_number() OVER (PARTITION BY tx, ty
-                                      ORDER BY v, scanpos) AS rnk
-         FROM cells),
-       base AS (
-         SELECT tx, ty,
-                CAST(sum(v * coef) AS BIGINT) AS wsum,
-                sum(v * coef) / 16.0 AS wmean,
-                CAST(min(v) AS BIGINT) AS mn,
-                CAST(max(v) AS BIGINT) AS mx,
-                CAST(max(CASE WHEN rnk = 5 THEN v END) AS BIGINT) AS med,
-                CAST(9 * sum(v * v) - sum(v) * sum(v) AS BIGINT) AS var_num
-         FROM ranked GROUP BY tx, ty),
-       grp AS (
-         SELECT tx, ty, v, count(*) AS cnt, max(scanpos) AS attain
-         FROM cells GROUP BY tx, ty, v),
-       g1 AS (SELECT *, max(cnt) OVER (PARTITION BY tx, ty) AS maxc
-              FROM grp),
-       g2 AS (SELECT *, min(CASE WHEN cnt = maxc THEN attain END)
-                            OVER (PARTITION BY tx, ty) AS best
-              FROM g1),
-       modes AS (
-         SELECT tx, ty,
-                CAST(max(CASE WHEN cnt = maxc AND attain = best THEN v END)
-                     AS BIGINT) AS mode_v
-         FROM g2 GROUP BY tx, ty)
-       SELECT b.tx, b.ty, b.wsum, b.wmean, b.mn, b.mx, b.med, b.var_num,
-              m.mode_v
-       FROM base b JOIN modes m ON b.tx = m.tx AND b.ty = m.ty""",
-)
-def q227(spark, sf_dir):
-    """``gdal raster neighbors`` (apps/gdalalg_raster_neighbors.cpp →
-    VRTKernelFilteredSource::FilterData, frmts/vrt/vrtfilters.cpp:
-    500-695): 3×3 neighborhood methods over interior pixels — weighted
-    sum + NORMALIZED mean with the [1,2,1;2,4,2;1,2,1] kernel (kernel
-    sum 16 ⇒ dyadic-exact mean), min/max/median (odd window ⇒ the
-    rank-5 order statistic) and mode with the reference's
-    first-to-reach-max-count-in-scan-order tie rule (a value attains
-    its final count at its LAST scan position, so the winner is the
-    max-count value with the smallest last-occurrence position — no
-    per-row state needed).  stddev is emitted as the exact integer
-    variance numerator 9·Σv² − (Σv)² (the reference's Welford
-    M2/n = var_num/81; sqrt'ing a float would be engine-ordered).
-    Relational halo: each target aggregates its 9 formula-derived
-    neighbor cells — on a tiled 100-TB raster the same plan reads each
-    tile once with a 1-pixel halo strip exchange (operators/focal
-    pattern), shuffle bounded by tile perimeter, no Python."""
-    t = (
-        spark.range(1, 39).select(F.col("id").alias("tx"))
-        .crossJoin(spark.range(1, 39).select(F.col("id").alias("ty")))
-    )
-    off = (
-        spark.range(3).select((F.col("id") - 1).alias("dy"))
-        .crossJoin(spark.range(3).select((F.col("id") - 1).alias("dx")))
-    )
-    sx = F.col("tx") + F.col("dx")
-    sy = F.col("ty") + F.col("dy")
-    cells = t.crossJoin(F.broadcast(off)).select(
-        "tx", "ty",
-        ((F.col("dy") + 1) * 3 + (F.col("dx") + 1)).alias("scanpos"),
-        F.when((F.col("dy") == 0) & (F.col("dx") == 0), 4)
-         .when((F.col("dy") == 0) | (F.col("dx") == 0), 2)
-         .otherwise(1).alias("coef"),
-        ((sx * 7 + sy * 13 + (sx * sy) % 5) % 97).alias("v"),
-    )
-    w = Window.partitionBy("tx", "ty").orderBy("v", "scanpos")
-    ranked = cells.withColumn("rnk", F.row_number().over(w))
-    base = ranked.groupBy("tx", "ty").agg(
-        F.sum(F.col("v") * F.col("coef")).cast("long").alias("wsum"),
-        (F.sum(F.col("v") * F.col("coef")) / 16.0).alias("wmean"),
-        F.min("v").cast("long").alias("mn"),
-        F.max("v").cast("long").alias("mx"),
-        F.max(F.when(F.col("rnk") == 5, F.col("v"))).cast("long")
-            .alias("med"),
-        (9 * F.sum(F.col("v") * F.col("v"))
-         - F.sum("v") * F.sum("v")).cast("long").alias("var_num"),
-    )
-    grp = cells.groupBy("tx", "ty", "v").agg(
-        F.count("*").alias("cnt"), F.max("scanpos").alias("attain")
-    )
-    wp = Window.partitionBy("tx", "ty")
-    grp = grp.withColumn("maxc", F.max("cnt").over(wp)).withColumn(
-        "best",
-        F.min(F.when(F.col("cnt") == F.col("maxc"), F.col("attain"))).over(wp),
-    )
-    modes = grp.groupBy("tx", "ty").agg(
-        F.max(
-            F.when(
-                (F.col("cnt") == F.col("maxc"))
-                & (F.col("attain") == F.col("best")),
-                F.col("v"),
-            )
-        ).cast("long").alias("mode_v")
-    )
-    return base.join(modes, ["tx", "ty"])
 
 
 # --- robots.txt longest-match policy (q228) -----------------------------------------
@@ -10615,124 +8453,6 @@ _ROBOTS_PATH_SQL = """
 """
 
 
-def _robots_oracle_sql() -> str:
-    vals = ", ".join(f"({r}, '{p}', {a})" for r, p, a in _ROBOTS_RULES)
-    return f"""WITH d AS (SELECT doc_id, doc_id % 40 AS host_id,
-                      {_ROBOTS_PATH_SQL} AS path FROM documents),
-       rules(ruleset, prefix, allow) AS (VALUES {vals}),
-       m AS (SELECT d.doc_id, d.host_id,
-                    max(length(r.prefix) * 2 + r.allow) AS code
-             FROM d LEFT JOIN rules r
-               ON d.host_id % 4 = r.ruleset
-              AND starts_with(d.path, r.prefix)
-             GROUP BY d.doc_id, d.host_id)
-       SELECT doc_id, host_id,
-              CAST(COALESCE(code, 1) % 2 AS BIGINT) AS allowed,
-              CAST(COALESCE(code, 1) // 2 AS BIGINT) AS matched_len
-       FROM m"""
-
-
-@query("q228_robots_longest_match", _robots_oracle_sql())
-def q228(spark, sf_dir):
-    """robots.txt REP evaluation (RFC 9309 / Google robots.cc
-    semantics, the crawl-side gate every Common-Crawl-style corpus
-    applies): per (host, path), the most-specific (LONGEST) matching
-    rule decides; an allow and a disallow of equal length tie to
-    ALLOW; no match ⇒ allowed.  The (length, allow) lexicographic
-    winner is encoded as the integer ``2·len + allow`` so the argmax
-    is a plain map-side-combinable MAX — no window, no sort.  Rules
-    broadcast (a rules table is ~10^6 rows for the whole web — always
-    the small side); docs never shuffle."""
-    d = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "doc_id % 40 AS host_id",
-        f"{_ROBOTS_PATH_SQL} AS path",
-    )
-    rules = spark.createDataFrame(
-        _ROBOTS_RULES, "ruleset INT, prefix STRING, allow INT"
-    )
-    j = d.join(
-        F.broadcast(rules),
-        (F.col("host_id") % 4 == F.col("ruleset"))
-        & F.col("path").startswith(F.col("prefix")),
-        "left",
-    )
-    m = j.groupBy("doc_id", "host_id").agg(
-        F.max(F.length("prefix") * 2 + F.col("allow")).alias("code")
-    )
-    code = F.coalesce(F.col("code"), F.lit(1))
-    return m.select(
-        "doc_id", "host_id",
-        (code % 2).cast("long").alias("allowed"),
-        F.floor(code / 2).cast("long").alias("matched_len"),
-    )
-
-
-# --- registrable-domain blocklist filter (q229) -------------------------------------
-
-_BLOCKLIST = [
-    "site3.com", "site17.com", "site17.co.uk", "cdn.site5.com",
-    "site21.co.uk", "site38.com",
-]
-
-_BLOCK_HOST_SQL = """
-    CASE WHEN doc_id % 4 = 0 THEN 'cdn.' ELSE '' END ||
-    'site' || CAST(doc_id % 40 AS STRING) ||
-    CASE WHEN doc_id % 3 = 0 THEN '.co.uk' ELSE '.com' END
-"""
-
-
-def _blocklist_oracle_sql() -> str:
-    vals = ", ".join(f"('{e}')" for e in _BLOCKLIST)
-    return f"""WITH d AS (SELECT doc_id, {_BLOCK_HOST_SQL} AS host
-                    FROM documents),
-       s AS (SELECT doc_id, host,
-                    [array_to_string(string_split(host, '.')[i:], '.')
-                     for i in range(1, len(string_split(host, '.')) + 1)]
-                        AS sufs
-             FROM d),
-       bl(entry) AS (VALUES {vals}),
-       hit AS (SELECT s.doc_id, min(b.entry) AS matched
-               FROM s JOIN bl b ON list_contains(s.sufs, b.entry)
-               GROUP BY s.doc_id)
-       SELECT d.doc_id, d.host,
-              CAST(CASE WHEN h.matched IS NULL THEN 0 ELSE 1 END AS BIGINT)
-                  AS blocked,
-              h.matched
-       FROM d LEFT JOIN hit h ON d.doc_id = h.doc_id"""
-
-
-@query("q229_domain_blocklist", _blocklist_oracle_sql())
-def q229(spark, sf_dir):
-    """UT1/adult-list-style domain blocklist filtering (the CCNet /
-    RefinedWeb URL gate): a host is blocked iff the list contains the
-    host itself or ANY parent domain (label-suffix match — so
-    ``cdn.site17.co.uk`` hits ``site17.co.uk``).  The host explodes
-    into its dot-suffix chain (≤ ~6 per host, pure JVM array ops) and
-    equi-joins the broadcast blocklist — candidate volume is
-    suffix-bounded, never host × entry regex scanning.  Deterministic
-    report: the lexicographically smallest matching entry."""
-    d = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", f"{_BLOCK_HOST_SQL} AS host"
-    )
-    s = d.selectExpr(
-        "doc_id", "host",
-        "explode(transform(sequence(1, size(split(host, '\\\\.'))), "
-        "i -> array_join(slice(split(host, '\\\\.'), i, "
-        "size(split(host, '\\\\.')) - i + 1), '.'))) AS suf",
-    )
-    bl = spark.createDataFrame([(e,) for e in _BLOCKLIST], "entry STRING")
-    hit = (
-        s.join(F.broadcast(bl), F.col("suf") == F.col("entry"))
-        .groupBy("doc_id").agg(F.min("entry").alias("matched"))
-    )
-    return d.join(hit, "doc_id", "left").select(
-        "doc_id", "host",
-        F.when(F.col("matched").isNull(), 0).otherwise(1).cast("long")
-            .alias("blocked"),
-        "matched",
-    )
-
-
 # --- SemDeDup: cluster-then-prune semantic dedup (q230) -----------------------------
 
 
@@ -10756,6 +8476,7 @@ def q229(spark, sf_dir):
        SELECT a.vec_id, a.cell,
               CAST(CASE WHEN d.b IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
        FROM a2 a LEFT JOIN dropped d ON a.vec_id = d.b""",
+    kind="operator",
 )
 def q230(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — the
@@ -10864,7 +8585,7 @@ def _bpe_oracle_sql(k: int, final_select: str | None = None) -> str:
     return "WITH " + ", ".join(ctes) + " " + final_select
 
 
-@query("q231_bpe_train", _bpe_oracle_sql(_BPE_ROUNDS))
+@query("q231_bpe_train", _bpe_oracle_sql(_BPE_ROUNDS), kind="operator")
 def q231(spark, sf_dir):
     """REAL BPE merge training (Sennrich et al. 2016,
     arXiv:1508.07909 — the learn-the-merges loop, complementing q48's
@@ -10880,107 +8601,6 @@ def q231(spark, sf_dir):
     return train_bpe_df(_t(spark, sf_dir, "documents"), _BPE_ROUNDS)
 
 
-# --- Gopher quality rules (q232) ----------------------------------------------------
-
-_GOPHER_BODY_SQL = """
-    CASE WHEN doc_id % 5 = 0 THEN '- ' ELSE '' END || text ||
-    CASE WHEN doc_id % 7 = 0 THEN ' ...' ELSE '' END ||
-    CASE WHEN doc_id % 11 = 0 THEN ' ####' ELSE '' END
-"""
-
-
-@query(
-    "q232_gopher_rules",
-    f"""WITH d AS (SELECT doc_id, {_GOPHER_BODY_SQL} AS body FROM documents),
-       t AS (SELECT doc_id, body,
-                    [w for w in string_split(body, ' ') if w <> ''] AS toks
-             FROM d),
-       m AS (SELECT doc_id,
-                    len(toks) AS n_words,
-                    list_sum([length(w) for w in toks]) AS n_chars,
-                    len([w for w in toks
-                         if w = '####' OR w = '...']) AS n_sym,
-                    CASE WHEN starts_with(body, '- ') THEN 1 ELSE 0 END
-                        AS bullet,
-                    CASE WHEN ends_with(body, '...') OR
-                              ends_with(body, '####') THEN 1 ELSE 0 END
-                        AS ell,
-                    len(list_distinct([w for w in toks
-                        if w IN ('the', 'a', 'of', 'and', 'to', 'in')]))
-                        AS n_stop
-             FROM t)
-       SELECT doc_id,
-              CAST(CASE WHEN n_words >= 50 AND n_words <= 100000
-                   THEN 1 ELSE 0 END AS BIGINT) AS ok_words,
-              CAST(CASE WHEN 3 * n_words <= n_chars
-                         AND n_chars <= 10 * n_words
-                   THEN 1 ELSE 0 END AS BIGINT) AS ok_meanlen,
-              CAST(CASE WHEN 10 * n_sym <= n_words THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_sym,
-              CAST(1 - bullet AS BIGINT) AS ok_bullet,
-              CAST(1 - ell AS BIGINT) AS ok_ellipsis,
-              CAST(CASE WHEN n_stop >= 2 THEN 1 ELSE 0 END AS BIGINT)
-                  AS ok_stop,
-              CAST(CASE WHEN n_words >= 50 AND n_words <= 100000
-                         AND 3 * n_words <= n_chars
-                         AND n_chars <= 10 * n_words
-                         AND 10 * n_sym <= n_words
-                         AND bullet = 0 AND ell = 0 AND n_stop >= 2
-                   THEN 1 ELSE 0 END AS BIGINT) AS keep
-       FROM m""",
-)
-def q232(spark, sf_dir):
-    """Gopher quality rules (Rae et al. 2021, arXiv:2112.11446 §A1.1 —
-    the rule set FineWeb/Dolma/RefinedWeb re-implement): word-count
-    window [50, 100k], mean word length in [3, 10] (exact integer
-    cross-multiplication, no division), symbol-to-word ratio ≤ 0.1,
-    bullet/ellipsis line rules, ≥ 2 distinct stopwords.  The body
-    derives from the documents table with deterministic bullet/
-    ellipsis/symbol injections so every rule fires on a known doc
-    subset.  Pure JVM Column plan, one projection — no shuffle, no
-    Python at 10^12 docs."""
-    d = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", f"{_GOPHER_BODY_SQL} AS body"
-    )
-    t = d.selectExpr(
-        "doc_id", "body",
-        "filter(split(body, ' '), w -> w != '') AS toks",
-    )
-    m = t.selectExpr(
-        "doc_id",
-        "size(toks) AS n_words",
-        "aggregate(transform(toks, w -> length(w)), 0, (a, x) -> a + x)"
-        " AS n_chars",
-        "size(filter(toks, w -> w = '####' OR w = '...')) AS n_sym",
-        "CASE WHEN body LIKE '- %' THEN 1 ELSE 0 END AS bullet",
-        "CASE WHEN body LIKE '%...' OR body LIKE '%####' THEN 1 ELSE 0 END"
-        " AS ell",
-        "size(array_distinct(filter(toks, w -> w IN "
-        "('the', 'a', 'of', 'and', 'to', 'in')))) AS n_stop",
-    )
-    ok_words = (F.col("n_words") >= 50) & (F.col("n_words") <= 100000)
-    ok_meanlen = (3 * F.col("n_words") <= F.col("n_chars")) & (
-        F.col("n_chars") <= 10 * F.col("n_words")
-    )
-    ok_sym = 10 * F.col("n_sym") <= F.col("n_words")
-    ok_stop = F.col("n_stop") >= 2
-    keep = (
-        ok_words & ok_meanlen & ok_sym
-        & (F.col("bullet") == 0) & (F.col("ell") == 0) & ok_stop
-    )
-    asb = lambda c: F.when(c, 1).otherwise(0).cast("long")  # noqa: E731
-    return m.select(
-        "doc_id",
-        asb(ok_words).alias("ok_words"),
-        asb(ok_meanlen).alias("ok_meanlen"),
-        asb(ok_sym).alias("ok_sym"),
-        (1 - F.col("bullet")).cast("long").alias("ok_bullet"),
-        (1 - F.col("ell")).cast("long").alias("ok_ellipsis"),
-        asb(ok_stop).alias("ok_stop"),
-        asb(keep).alias("keep"),
-    )
-
-
 # --- BPE tokenizer apply (q233) -----------------------------------------------------
 
 
@@ -10990,6 +8610,7 @@ def q232(spark, sf_dir):
         _BPE_ROUNDS,
         f"SELECT word, CAST(cnt AS BIGINT) AS cnt, syms FROM w{_BPE_ROUNDS}",
     ),
+    kind="operator",
 )
 def q233(spark, sf_dir):
     """Tokenizer APPLY for the learned BPE merges: after the q231
@@ -11061,6 +8682,7 @@ _SCOV_Y = "(chain_id // 4) * 8 + i"
               CAST(sum(rn * x) AS BIGINT) AS cs_x,
               CAST(sum(rn * y) AS BIGINT) AS cs_y
        FROM kv GROUP BY chain_id""",
+    kind="operator",
 )
 def q234(spark, sf_dir):
     """``gdal vector simplify-coverage``
@@ -11119,7 +8741,7 @@ def _robots_stream_oracle_sql() -> str:
        FROM m GROUP BY 1, 2, 3"""
 
 
-@query("q235_stream_robots_gate", _robots_stream_oracle_sql())
+@query("q235_stream_robots_gate", _robots_stream_oracle_sql(), kind="operator")
 def q235(spark, sf_dir):
     """STREAMING robots gate (the incremental form of q228): fetch
     events land as a file stream; the RFC 9309 longest-match decision
@@ -11194,6 +8816,7 @@ def _sa_fixture(spark, sf_dir):
 @query(
     "q236_suffix_array",
     f"WITH {_SA_CORPUS_CTE} SELECT pos, CAST(rnk AS BIGINT) AS rnk FROM sa",
+    kind="operator",
 )
 def q236(spark, sf_dir):
     """Distributed suffix array by prefix doubling (Manber-Myers) —
@@ -11230,6 +8853,7 @@ def q236(spark, sf_dir):
        SELECT CAST(rnk AS BIGINT) AS rnk, CAST(pa AS BIGINT) AS pa,
               CAST(pb AS BIGINT) AS pb, CAST(lcp AS BIGINT) AS lcp
        FROM x""",
+    kind="operator",
 )
 def q237(spark, sf_dir):
     """LCP array between rank-adjacent suffixes, fully relational: the
@@ -11288,6 +8912,7 @@ def q237(spark, sf_dir):
                   AS dup_chars,
               CAST(o.len AS BIGINT) AS total_chars
        FROM offs o LEFT JOIN agg a ON o.doc_id = a.doc_id""",
+    kind="operator",
 )
 def q238(spark, sf_dir):
     """ExactSubstr duplicate-byte accounting (Lee et al. 2022 §4.1):
@@ -11308,684 +8933,6 @@ def q238(spark, sf_dir):
     sa = suffix_array(chars, n)
     lcp = lcp_array(sa, chars, _SA_CAP)
     return dup_span_accounting(lcp, offsets, _SA_MINLEN)
-
-
-# --- Gopher repetition rules: duplicate lines / paragraphs (q239) --------------------
-#
-# Rae et al. 2021 §A1.1 repetition signals (the half q232 does not
-# cover).  Spec pinned here: a line/paragraph is DUPLICATED iff its
-# exact text occurs more than once within the document; the fraction
-# counts every member of a duplicated group; char fractions weight by
-# the line/para length.  Lines are 5-word chunks of the token stream
-# (deterministic, both engines build the identical list); paragraphs
-# are consecutive line pairs.  Deterministic injections: doc_id%4==0
-# appends a copy of line 1, doc_id%6==0 appends a copy of paragraph 1.
-# Gopher thresholds: dup_line_frac<=0.30, dup_para_frac<=0.30,
-# dup_line_char_frac<=0.20, dup_para_char_frac<=0.20 — all checked by
-# integer cross-multiplication, no division anywhere.
-
-
-@query(
-    "q239_gopher_dup_lines",
-    """WITH t AS (SELECT doc_id,
-                [w for w in string_split(text, ' ') if w <> ''] AS toks
-             FROM documents),
-       b AS (SELECT doc_id,
-                CASE WHEN len(toks) > 2000
-                     THEN error('q239 fixture outgrew range bound')
-                     ELSE 1 END AS ok,
-                [array_to_string(toks[i*5+1:i*5+5], ' ')
-                 for i in range(0, 400) if i*5 < len(toks)] AS lines0
-             FROM t),
-       lp AS (SELECT doc_id,
-                 CASE WHEN doc_id % 4 = 0
-                      THEN list_append(lines0, lines0[1])
-                      ELSE lines0 END AS lines,
-                 CASE WHEN doc_id % 6 = 0
-                      THEN list_append(p0, p0[1]) ELSE p0 END AS paras
-              FROM (SELECT doc_id, lines0,
-                       [array_to_string(lines0[2*j+1:2*j+2], chr(10))
-                        for j in range(0, 200) if 2*j < len(lines0)] AS p0
-                    FROM b)),
-       le AS (SELECT doc_id, unnest(lines) AS item FROM lp),
-       lg AS (SELECT doc_id, item, count(*) AS cnt FROM le GROUP BY 1, 2),
-       lm AS (SELECT doc_id, sum(cnt) AS n_lines,
-                     sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS dup_lines,
-                     sum(cnt * length(item)) AS line_chars,
-                     sum(CASE WHEN cnt > 1 THEN cnt * length(item)
-                         ELSE 0 END) AS dup_line_chars
-              FROM lg GROUP BY 1),
-       pe AS (SELECT doc_id, unnest(paras) AS item FROM lp),
-       pg AS (SELECT doc_id, item, count(*) AS cnt FROM pe GROUP BY 1, 2),
-       pm AS (SELECT doc_id, sum(cnt) AS n_paras,
-                     sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS dup_paras,
-                     sum(cnt * length(item)) AS para_chars,
-                     sum(CASE WHEN cnt > 1 THEN cnt * length(item)
-                         ELSE 0 END) AS dup_para_chars
-              FROM pg GROUP BY 1)
-       SELECT l.doc_id,
-              CAST(l.n_lines AS BIGINT) AS n_lines,
-              CAST(l.dup_lines AS BIGINT) AS dup_lines,
-              CAST(l.dup_line_chars AS BIGINT) AS dup_line_chars,
-              CAST(p.n_paras AS BIGINT) AS n_paras,
-              CAST(p.dup_paras AS BIGINT) AS dup_paras,
-              CAST(p.dup_para_chars AS BIGINT) AS dup_para_chars,
-              CAST(CASE WHEN 10 * l.dup_lines <= 3 * l.n_lines
-                   THEN 1 ELSE 0 END AS BIGINT) AS ok_dup_line,
-              CAST(CASE WHEN 5 * l.dup_line_chars <= l.line_chars
-                   THEN 1 ELSE 0 END AS BIGINT) AS ok_dup_line_char,
-              CAST(CASE WHEN 10 * p.dup_paras <= 3 * p.n_paras
-                   THEN 1 ELSE 0 END AS BIGINT) AS ok_dup_para,
-              CAST(CASE WHEN 5 * p.dup_para_chars <= p.para_chars
-                   THEN 1 ELSE 0 END AS BIGINT) AS ok_dup_para_char,
-              CAST(CASE WHEN 10 * l.dup_lines <= 3 * l.n_lines
-                         AND 5 * l.dup_line_chars <= l.line_chars
-                         AND 10 * p.dup_paras <= 3 * p.n_paras
-                         AND 5 * p.dup_para_chars <= p.para_chars
-                   THEN 1 ELSE 0 END AS BIGINT) AS keep
-       FROM lm l JOIN pm p ON l.doc_id = p.doc_id""",
-)
-def q239(spark, sf_dir):
-    """Gopher repetition rules, line/paragraph half (Rae et al. 2021
-    arXiv:2112.11446 §A1.1): duplicate-line fraction <= 0.30,
-    duplicate-paragraph fraction <= 0.30, duplicate-line-CHAR fraction
-    <= 0.20, duplicate-paragraph-CHAR fraction <= 0.20 — every
-    threshold an exact integer cross-multiplication.  Lines are
-    deterministic 5-word chunks, paragraphs line pairs; injections on
-    doc_id%4 / doc_id%6 append an exact copy of line 1 / paragraph 1
-    so each rule fires on a known subset.  The plan is two explode +
-    groupBy passes over (doc, item) — shuffles on the line/para
-    vocabulary, never doc x doc; at 10^12 docs the group key space is
-    corpus-sized but each group is tiny (the exact shape Spark's
-    hash aggregation partial-combines)."""
-    t = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "filter(split(text, ' '), w -> w != '') AS toks"
-    )
-    b = t.selectExpr(
-        "doc_id",
-        "transform(sequence(0, int((size(toks) - 1) / 5)), "
-        "i -> array_join(slice(toks, i*5+1, 5), ' ')) AS lines0",
-    )
-    lp = b.selectExpr(
-        "doc_id",
-        "CASE WHEN doc_id % 4 = 0 THEN concat(lines0, "
-        "array(element_at(lines0, 1))) ELSE lines0 END AS lines",
-        "transform(sequence(0, int((size(lines0) - 1) / 2)), "
-        "j -> array_join(slice(lines0, 2*j+1, 2), '\\n')) AS p0",
-    ).selectExpr(
-        "doc_id", "lines",
-        "CASE WHEN doc_id % 6 = 0 THEN concat(p0, "
-        "array(element_at(p0, 1))) ELSE p0 END AS paras",
-    )
-
-    def _stats(col, pfx):
-        e = lp.select("doc_id", F.explode(col).alias("item"))
-        g = e.groupBy("doc_id", "item").agg(F.count("*").alias("cnt"))
-        dup = F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0)
-        dupc = F.when(F.col("cnt") > 1,
-                      F.col("cnt") * F.length("item")).otherwise(0)
-        return g.groupBy("doc_id").agg(
-            F.sum("cnt").alias(f"n_{pfx}"),
-            F.sum(dup).alias(f"dup_{pfx}"),
-            F.sum(F.col("cnt") * F.length("item")).alias(f"{pfx}_chars"),
-            F.sum(dupc).alias(f"dup_{pfx}_chars"),
-        )
-
-    lm = _stats("lines", "lines")
-    pm = _stats("paras", "paras")
-    m = lm.join(pm, "doc_id")
-    ok_l = 10 * F.col("dup_lines") <= 3 * F.col("n_lines")
-    ok_lc = 5 * F.col("dup_lines_chars") <= F.col("lines_chars")
-    ok_p = 10 * F.col("dup_paras") <= 3 * F.col("n_paras")
-    ok_pc = 5 * F.col("dup_paras_chars") <= F.col("paras_chars")
-    asb = lambda c: F.when(c, 1).otherwise(0).cast("long")  # noqa: E731
-    return m.select(
-        "doc_id",
-        F.col("n_lines").cast("long").alias("n_lines"),
-        F.col("dup_lines").cast("long").alias("dup_lines"),
-        F.col("dup_lines_chars").cast("long").alias("dup_line_chars"),
-        F.col("n_paras").cast("long").alias("n_paras"),
-        F.col("dup_paras").cast("long").alias("dup_paras"),
-        F.col("dup_paras_chars").cast("long").alias("dup_para_chars"),
-        asb(ok_l).alias("ok_dup_line"),
-        asb(ok_lc).alias("ok_dup_line_char"),
-        asb(ok_p).alias("ok_dup_para"),
-        asb(ok_pc).alias("ok_dup_para_char"),
-        asb(ok_l & ok_lc & ok_p & ok_pc).alias("keep"),
-    )
-
-
-# --- Gopher repetition rules: top / duplicated n-gram char fractions (q240) ---------
-
-_NGRAM_BODY_SQL = (
-    "text || CASE WHEN doc_id % 5 = 0 THEN repeat("
-    "' call now and subscribe to our newsletter today', 2) ELSE '' END"
-)
-
-
-@query(
-    "q240_gopher_ngram_rep",
-    f"""WITH d AS (SELECT doc_id, {_NGRAM_BODY_SQL} AS body FROM documents),
-       t AS (SELECT doc_id,
-                [w for w in string_split(body, ' ') if w <> ''] AS toks
-             FROM d),
-       base AS (SELECT doc_id, toks,
-                   length(array_to_string(toks, ' ')) AS den,
-                   CASE WHEN len(toks) > 128
-                        THEN error('q240 fixture outgrew range bound')
-                        ELSE 1 END AS ok
-                FROM t),
-       nn AS (SELECT unnest([2, 3, 4, 5, 6, 7, 8, 9, 10]) AS n),
-       ps AS (SELECT doc_id, n, toks,
-                 unnest([p for p in range(1, 130)
-                         if p + n - 1 <= len(toks)]) AS p
-              FROM base, nn),
-       psg AS (SELECT doc_id, n, p,
-                  array_to_string(toks[p:p+n-1], ' ') AS gram
-               FROM ps),
-       cg AS (SELECT doc_id, n, gram, count(*) AS cnt
-              FROM psg GROUP BY 1, 2, 3),
-       mt AS (SELECT doc_id, n, max(cnt) AS mc FROM cg
-              WHERE n <= 4 GROUP BY 1, 2),
-       tg AS (SELECT c.doc_id, c.n, m.mc, max(c.gram) AS tgram
-              FROM cg c JOIN mt m
-                ON c.doc_id = m.doc_id AND c.n = m.n AND c.cnt = m.mc
-              GROUP BY 1, 2, 3),
-       tnum AS (SELECT doc_id, n, mc * length(tgram) AS num FROM tg),
-       dupg AS (SELECT doc_id, n, gram FROM cg WHERE n >= 5 AND cnt > 1),
-       covp AS (SELECT g.doc_id, g.n, g.p,
-                   unnest([kk for kk in range(0, 10) if kk < g.n]) AS k
-                FROM psg g JOIN dupg u
-                  USING (doc_id, n, gram)),
-       cov AS (SELECT DISTINCT doc_id, n, p + k AS pos FROM covp),
-       tkl AS (SELECT doc_id,
-                  unnest([q for q in range(1, 130)
-                          if q <= len(toks)]) AS pos,
-                  toks
-               FROM base),
-       tk2 AS (SELECT doc_id, pos, length(toks[pos]) AS wl FROM tkl),
-       covc AS (SELECT c.doc_id, c.n, sum(t2.wl) AS num
-                FROM cov c JOIN tk2 t2 USING (doc_id, pos)
-                GROUP BY 1, 2),
-       tp AS (SELECT doc_id,
-                 max(CASE WHEN n = 2 THEN num ELSE 0 END) AS top2_num,
-                 max(CASE WHEN n = 3 THEN num ELSE 0 END) AS top3_num,
-                 max(CASE WHEN n = 4 THEN num ELSE 0 END) AS top4_num
-              FROM tnum GROUP BY 1),
-       dp AS (SELECT doc_id,
-                 max(CASE WHEN n = 5 THEN num ELSE 0 END) AS dup5_num,
-                 max(CASE WHEN n = 6 THEN num ELSE 0 END) AS dup6_num,
-                 max(CASE WHEN n = 7 THEN num ELSE 0 END) AS dup7_num,
-                 max(CASE WHEN n = 8 THEN num ELSE 0 END) AS dup8_num,
-                 max(CASE WHEN n = 9 THEN num ELSE 0 END) AS dup9_num,
-                 max(CASE WHEN n = 10 THEN num ELSE 0 END) AS dup10_num
-              FROM covc GROUP BY 1),
-       fin AS (SELECT b.doc_id, b.den,
-                  coalesce(tp.top2_num, 0) AS top2_num,
-                  coalesce(tp.top3_num, 0) AS top3_num,
-                  coalesce(tp.top4_num, 0) AS top4_num,
-                  coalesce(dp.dup5_num, 0) AS dup5_num,
-                  coalesce(dp.dup6_num, 0) AS dup6_num,
-                  coalesce(dp.dup7_num, 0) AS dup7_num,
-                  coalesce(dp.dup8_num, 0) AS dup8_num,
-                  coalesce(dp.dup9_num, 0) AS dup9_num,
-                  coalesce(dp.dup10_num, 0) AS dup10_num
-               FROM base b
-               LEFT JOIN tp ON b.doc_id = tp.doc_id
-               LEFT JOIN dp ON b.doc_id = dp.doc_id)
-       SELECT doc_id, CAST(den AS BIGINT) AS den,
-              CAST(top2_num AS BIGINT) AS top2_num,
-              CAST(top3_num AS BIGINT) AS top3_num,
-              CAST(top4_num AS BIGINT) AS top4_num,
-              CAST(dup5_num AS BIGINT) AS dup5_num,
-              CAST(dup6_num AS BIGINT) AS dup6_num,
-              CAST(dup7_num AS BIGINT) AS dup7_num,
-              CAST(dup8_num AS BIGINT) AS dup8_num,
-              CAST(dup9_num AS BIGINT) AS dup9_num,
-              CAST(dup10_num AS BIGINT) AS dup10_num,
-              CAST(CASE WHEN top2_num * 5 <= den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_top2,
-              CAST(CASE WHEN top3_num * 50 <= 9 * den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_top3,
-              CAST(CASE WHEN top4_num * 25 <= 4 * den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_top4,
-              CAST(CASE WHEN dup5_num * 20 <= 3 * den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_dup5,
-              CAST(CASE WHEN dup6_num * 50 <= 7 * den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_dup6,
-              CAST(CASE WHEN dup7_num * 100 <= 13 * den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_dup7,
-              CAST(CASE WHEN dup8_num * 25 <= 3 * den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_dup8,
-              CAST(CASE WHEN dup9_num * 100 <= 11 * den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_dup9,
-              CAST(CASE WHEN dup10_num * 10 <= den THEN 1 ELSE 0 END
-                   AS BIGINT) AS ok_dup10,
-              CAST(CASE WHEN top2_num * 5 <= den
-                         AND top3_num * 50 <= 9 * den
-                         AND top4_num * 25 <= 4 * den
-                         AND dup5_num * 20 <= 3 * den
-                         AND dup6_num * 50 <= 7 * den
-                         AND dup7_num * 100 <= 13 * den
-                         AND dup8_num * 25 <= 3 * den
-                         AND dup9_num * 100 <= 11 * den
-                         AND dup10_num * 10 <= den
-                   THEN 1 ELSE 0 END AS BIGINT) AS keep
-       FROM fin""",
-)
-def q240(spark, sf_dir):
-    """Gopher repetition rules, n-gram half (Rae et al. 2021
-    arXiv:2112.11446 §A1.1): for n in {2,3,4} the fraction of chars in
-    the MOST FREQUENT n-gram (thresholds 0.20/0.18/0.16); for n in
-    {5..10} the fraction of chars covered by DUPLICATED n-grams,
-    each covered word counted once (interval union by position
-    DISTINCT; thresholds 0.15..0.10).  Spec pins: grams are
-    space-joined token windows, char masses are length(gram) for top
-    and summed token lengths for coverage, most-frequent ties break
-    to the lexicographically largest gram (struct-max — map-side
-    combinable, no window over the gram table).  All 9 thresholds are
-    exact integer cross-multiplications.  Plan: ONE position-exploded
-    gram table for all 9 n values, hash-aggregated on (doc, n, gram)
-    — shuffle on the gram vocabulary, linear in corpus size; the
-    doc_id%5 injection duplicates an 8-word sentence so n=5..8
-    coverage fires on a known subset."""
-    d = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", f"{_NGRAM_BODY_SQL} AS body"
-    )
-    base = d.selectExpr(
-        "doc_id", "filter(split(body, ' '), w -> w != '') AS toks"
-    ).selectExpr("doc_id", "toks", "length(array_join(toks, ' ')) AS den")
-    ps = base.select(
-        "doc_id", "toks",
-        F.explode(F.expr("sequence(2, 10)")).alias("n"),
-    ).filter(F.expr("size(toks) >= n")).selectExpr(
-        "doc_id", "toks", "n",
-        "explode(sequence(1, size(toks) - n + 1)) AS p",
-    )
-    psg = ps.selectExpr(
-        "doc_id", "n", "p", "array_join(slice(toks, p, n), ' ') AS gram"
-    )
-    cg = psg.groupBy("doc_id", "n", "gram").agg(F.count("*").alias("cnt"))
-    tops = (
-        cg.filter("n <= 4")
-        .groupBy("doc_id", "n")
-        .agg(F.max(F.struct("cnt", "gram")).alias("s"))
-        .selectExpr("doc_id", "n", "s.cnt * length(s.gram) AS num")
-    )
-    dupg = cg.filter("n >= 5 AND cnt > 1").select("doc_id", "n", "gram")
-    cov = (
-        psg.join(dupg, ["doc_id", "n", "gram"])
-        .selectExpr("doc_id", "n", "explode(sequence(p, p + n - 1)) AS pos")
-        .distinct()
-    )
-    tk = base.select(
-        "doc_id", F.posexplode("toks").alias("pos0", "w")
-    ).selectExpr("doc_id", "pos0 + 1 AS pos", "length(w) AS wl")
-    covc = (
-        cov.join(tk, ["doc_id", "pos"])
-        .groupBy("doc_id", "n")
-        .agg(F.sum("wl").alias("num"))
-    )
-
-    def _piv(df, col_of, names):
-        aggs = [
-            F.coalesce(
-                F.max(F.when(F.col("n") == n, F.col("num"))), F.lit(0)
-            ).cast("long").alias(f"{col_of}{n}_num")
-            for n in names
-        ]
-        return df.groupBy("doc_id").agg(*aggs)
-
-    tp = _piv(tops, "top", [2, 3, 4])
-    dp = _piv(covc, "dup", [5, 6, 7, 8, 9, 10])
-    fin = (
-        base.select("doc_id", F.col("den").cast("long").alias("den"))
-        .join(tp, "doc_id", "left")
-        .join(dp, "doc_id", "left")
-    )
-    for c in ["top2_num", "top3_num", "top4_num", "dup5_num", "dup6_num",
-              "dup7_num", "dup8_num", "dup9_num", "dup10_num"]:
-        fin = fin.withColumn(c, F.coalesce(F.col(c), F.lit(0)).cast("long"))
-    thr = {
-        "top2": (5, 1), "top3": (50, 9), "top4": (25, 4),
-        "dup5": (20, 3), "dup6": (50, 7), "dup7": (100, 13),
-        "dup8": (25, 3), "dup9": (100, 11), "dup10": (10, 1),
-    }
-    asb = lambda c: F.when(c, 1).otherwise(0).cast("long")  # noqa: E731
-    oks = {k: F.col(f"{k}_num") * a <= b * F.col("den")
-           for k, (a, b) in thr.items()}
-    keep = None
-    for c in oks.values():
-        keep = c if keep is None else (keep & c)
-    return fin.select(
-        "doc_id", "den",
-        *[F.col(f"{k}_num") for k in thr],
-        *[asb(oks[k]).alias(f"ok_{k}") for k in thr],
-        asb(keep).alias("keep"),
-    )
-
-
-# --- HITS hubs/authorities over the host link graph (q241) --------------------------
-
-_HITS_ROUNDS = 4
-
-
-def _hits_oracle_sql() -> str:
-    ctes = ["""hosts AS (SELECT DISTINCT doc_id % 40 AS host FROM documents),
-       edges AS (SELECT host AS src, (host + 1) % 40 AS dst FROM hosts
-                 UNION ALL SELECT host, (host * 2 + 7) % 40 FROM hosts
-                 UNION ALL SELECT host, (host * 3 + 11) % 40 FROM hosts),
-       h0 AS (SELECT host, CAST(1 AS BIGINT) AS h FROM hosts)"""]
-    for t in range(1, _HITS_ROUNDS + 1):
-        ctes.append(f"""a{t} AS (SELECT x.host,
-                     CAST(coalesce(s.s, 0) AS BIGINT) AS a
-              FROM hosts x LEFT JOIN
-                   (SELECT e.dst AS host, sum(h.h) AS s
-                    FROM edges e JOIN h{t-1} h ON e.src = h.host
-                    GROUP BY e.dst) s USING (host))""")
-        ctes.append(f"""h{t} AS (SELECT x.host,
-                     CAST(coalesce(s.s, 0) AS BIGINT) AS h
-              FROM hosts x LEFT JOIN
-                   (SELECT e.src AS host, sum(a.a) AS s
-                    FROM edges e JOIN a{t} a ON e.dst = a.host
-                    GROUP BY e.src) s USING (host))""")
-    t = _HITS_ROUNDS
-    return ("WITH " + ",\n       ".join(ctes)
-            + f"""
-       SELECT a{t}.host AS host, a{t}.a AS auth, h{t}.h AS hub
-       FROM a{t} JOIN h{t} ON a{t}.host = h{t}.host""")
-
-
-@query("q241_hits", _hits_oracle_sql())
-def q241(spark, sf_dir):
-    """HITS hubs & authorities (Kleinberg 1999) over the q190 host
-    link graph in EXACT INTEGER arithmetic: the textbook mutual
-    recursion a_{t+1}(v) = sum_{u->v} h_t(u), h_{t+1}(u) =
-    sum_{u->v} a_{t+1}(v), run unnormalized for 4 rounds — rank
-    order equals the normalized iteration's (normalization is a
-    per-round positive scalar), and the growth bound (max in/out
-    degree 3)^(2*4) keeps every value far inside BIGINT, so both
-    engines agree bitwise with no float normalization anywhere.
-    Each half-round is one equi-join + one map-side-combinable sum —
-    the same shuffle shape as PageRank; at 10^12 pages the host
-    graph is ~10^8 rows, everything keys on host."""
-    docs = _t(spark, sf_dir, "documents")
-    hosts = docs.select((F.col("doc_id") % 40).alias("host")).distinct()
-    edges = hosts.select(
-        F.col("host").alias("src"),
-        F.explode(F.array(
-            (F.col("host") + 1) % 40,
-            (F.col("host") * 2 + 7) % 40,
-            (F.col("host") * 3 + 11) % 40,
-        )).alias("dst"),
-    ).localCheckpoint(eager=True)
-    h = hosts.withColumn("h", F.lit(1).cast("long"))
-    for _ in range(_HITS_ROUNDS):
-        a = (
-            hosts.join(
-                edges.join(h, edges.src == h.host)
-                .groupBy("dst").agg(F.sum("h").alias("s")),
-                hosts.host == F.col("dst"), "left")
-            .select(hosts.host,
-                    F.coalesce("s", F.lit(0)).cast("long").alias("a"))
-        )
-        h = (
-            hosts.join(
-                edges.join(a, edges.dst == a.host)
-                .groupBy("src").agg(F.sum("a").alias("s")),
-                hosts.host == F.col("src"), "left")
-            .select(hosts.host,
-                    F.coalesce("s", F.lit(0)).cast("long").alias("h"))
-        )
-    a = a.localCheckpoint(eager=True)
-    h = h.localCheckpoint(eager=True)
-    return a.join(h, "host").select(
-        "host", F.col("a").alias("auth"), F.col("h").alias("hub")
-    )
-
-
-# --- cross-doc boilerplate line removal (q242) ---------------------------------------
-#
-# CCNet (Wenzek et al. 2020, arXiv:1911.00359) strips every line whose
-# exact text recurs across documents (their per-shard line-hash dedup
-# — the pass that kills cookie banners / nav bars / copyright
-# footers).  Spec pinned: a line is boilerplate iff it occurs in >= 2
-# DISTINCT documents; removal drops every occurrence.  Footer
-# injections on doc_id%3 ("all rights reserved contact us") and
-# doc_id%7 ("follow us on social media today") create the cross-doc
-# mass; 5-word content lines never collide across docs in this
-# corpus.
-
-_BOILER_LINES_SQL = """
-    list_concat(
-        [array_to_string(tk[i*5+1:i*5+5], ' ')
-         for i in range(0, 400) if i*5 < len(tk)],
-        CASE WHEN doc_id % 3 = 0
-             THEN ['all rights reserved contact us'] ELSE [] END ||
-        CASE WHEN doc_id % 7 = 0
-             THEN ['follow us on social media today'] ELSE [] END)
-"""
-
-
-@query(
-    "q242_boilerplate_lines",
-    f"""WITH t AS (SELECT doc_id,
-                [w for w in string_split(text, ' ') if w <> ''] AS tk
-             FROM documents),
-       l AS (SELECT doc_id, {_BOILER_LINES_SQL} AS lines FROM t),
-       e AS (SELECT doc_id, unnest(lines) AS line FROM l),
-       v AS (SELECT line, count(DISTINCT doc_id) AS ndocs
-             FROM e GROUP BY line),
-       m AS (SELECT e.doc_id,
-                    count(*) AS n_lines,
-                    sum(CASE WHEN v.ndocs >= 2 THEN 1 ELSE 0 END)
-                        AS removed_lines,
-                    sum(CASE WHEN v.ndocs >= 2 THEN 0
-                        ELSE length(e.line) END) AS kept_chars
-             FROM e JOIN v USING (line) GROUP BY e.doc_id)
-       SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-              CAST(removed_lines AS BIGINT) AS removed_lines,
-              CAST(kept_chars AS BIGINT) AS kept_chars
-       FROM m""",
-)
-def q242(spark, sf_dir):
-    """Cross-document boilerplate line removal (CCNet, arXiv:1911.00359
-    §3.1): every line occurring in >= 2 distinct documents is dropped
-    everywhere — the pass that strips nav bars and copyright footers
-    from 10^12 crawled pages.  Plan: explode lines, groupBy LINE
-    (vocabulary-keyed shuffle with map-side combine — never doc x
-    doc), join the per-line distinct-doc count back, aggregate per
-    doc.  At corpus scale the line vocabulary is the working set,
-    exactly CCNet's sharded-hash design; here the hash is the line
-    itself so both engines agree bitwise."""
-    t = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "filter(split(text, ' '), w -> w != '') AS tk"
-    )
-    lines = t.selectExpr(
-        "doc_id",
-        "concat(transform(sequence(0, int((size(tk) - 1) / 5)), "
-        "i -> array_join(slice(tk, i*5+1, 5), ' ')), "
-        "CASE WHEN doc_id % 3 = 0 "
-        "THEN array('all rights reserved contact us') "
-        "ELSE array() END, "
-        "CASE WHEN doc_id % 7 = 0 "
-        "THEN array('follow us on social media today') "
-        "ELSE array() END) AS lines",
-    )
-    e = lines.select("doc_id", F.explode("lines").alias("line"))
-    v = e.groupBy("line").agg(
-        F.countDistinct("doc_id").alias("ndocs")
-    )
-    return (
-        e.join(v, "line")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_lines"),
-            F.sum(F.when(F.col("ndocs") >= 2, 1).otherwise(0))
-            .cast("long").alias("removed_lines"),
-            F.sum(F.when(F.col("ndocs") >= 2, 0)
-                  .otherwise(F.length("line")))
-            .cast("long").alias("kept_chars"),
-        )
-    )
-
-
-# --- CCNet LM-perplexity bucketing, integer surprisal proxy (q243) -------------------
-
-_CCNET_BODY_SQL = (
-    "text || repeat(' xq' || CAST(doc_id % 13 AS STRING), doc_id % 9)"
-)
-
-
-@query(
-    "q243_ccnet_lm_buckets",
-    f"""WITH d AS (SELECT doc_id, lang, {_CCNET_BODY_SQL} AS body
-                FROM documents),
-       t AS (SELECT doc_id, lang,
-                [w for w in string_split(body, ' ') if w <> ''] AS tk
-             FROM d),
-       e AS (SELECT doc_id, lang, unnest(tk) AS w FROM t),
-       ref AS (SELECT w, count(*) AS c FROM e WHERE lang = 'en'
-               GROUP BY w),
-       tot AS (SELECT sum(c) AS T FROM ref),
-       sc AS (SELECT e.doc_id, count(*) AS n,
-                 sum(greatest(0, (length(bin((SELECT T FROM tot))) - 1)
-                     - (length(bin(coalesce(r.c, 0) + 1)) - 1))) AS s
-              FROM e LEFT JOIN ref r ON e.w = r.w
-              GROUP BY e.doc_id)
-       SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-              CAST(s AS BIGINT) AS surprisal,
-              CASE WHEN 20 * s <= 103 * n THEN 'head'
-                   WHEN 100 * s <= 527 * n THEN 'middle'
-                   ELSE 'tail' END AS bucket
-       FROM sc""",
-)
-def q243(spark, sf_dir):
-    """CCNet LM-perplexity bucketing (Wenzek et al. 2020,
-    arXiv:1911.00359 §3.3) with an INTEGER surprisal proxy: the
-    reference model is the unigram count table of the lang='en' slice
-    (the 'target-domain' corpus standing in for their Wikipedia LM);
-    a token's surprisal is floor(log2 T) - floor(log2 (c+1)) computed
-    as length(bin(x))-1 — pure integer bit-length, bitwise identical
-    across engines, no transcendental log anywhere.  Docs bucket
-    head/middle/tail on the per-token average via cross-multiplied
-    integer thresholds (5.15 / 5.27 bits per token).  Plan: one
-    vocabulary-keyed groupBy to train, one word-keyed join to score
-    (the LM table broadcasts at realistic vocab sizes), one per-doc
-    sum — linear end to end; rare-token injections (doc_id%9 copies
-    of a doc_id%13 token) create the spread the buckets measure."""
-    d = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "lang", f"{_CCNET_BODY_SQL} AS body"
-    )
-    e = d.selectExpr(
-        "doc_id", "lang",
-        "explode(filter(split(body, ' '), w -> w != '')) AS w",
-    )
-    ref = e.filter("lang = 'en'").groupBy("w").agg(
-        F.count("*").alias("c")
-    )
-    T = ref.agg(F.sum("c").alias("T"))
-    scored = (
-        e.join(F.broadcast(ref), "w", "left")
-        .crossJoin(F.broadcast(T))
-        .select(
-            "doc_id",
-            F.greatest(
-                F.lit(0),
-                (F.length(F.expr("bin(T)")) - 1)
-                - (F.length(F.expr("bin(coalesce(c, 0) + 1)")) - 1),
-            ).alias("bits"),
-        )
-    )
-    sc = scored.groupBy("doc_id").agg(
-        F.count("*").alias("n"), F.sum("bits").alias("s")
-    )
-    return sc.select(
-        "doc_id",
-        F.col("n").cast("long").alias("n_tokens"),
-        F.col("s").cast("long").alias("surprisal"),
-        F.when(20 * F.col("s") <= 103 * F.col("n"), "head")
-        .when(100 * F.col("s") <= 527 * F.col("n"), "middle")
-        .otherwise("tail").alias("bucket"),
-    )
-
-
-# --- positional inverted index: phrase retrieval (q244) ------------------------------
-
-
-@query(
-    "q244_phrase_search",
-    """WITH t AS (SELECT doc_id,
-                [w for w in string_split(text, ' ') if w <> ''] AS tk
-             FROM documents),
-       tok AS (SELECT doc_id,
-                  unnest([p for p in range(1, 130) if p <= len(tk)]) AS pos,
-                  tk
-               FROM (SELECT doc_id, tk,
-                        CASE WHEN len(tk) > 128
-                             THEN error('q244 fixture outgrew range bound')
-                             ELSE 1 END AS ok FROM t)),
-       tok2 AS (SELECT doc_id, pos, tk[pos] AS w FROM tok),
-       q AS (SELECT doc_id AS qid, tk[1] AS w1, tk[2] AS w2 FROM t
-             WHERE doc_id < 3),
-       hit AS (SELECT q.qid, a.doc_id, a.pos
-               FROM q JOIN tok2 a ON a.w = q.w1
-               JOIN tok2 b ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-                          AND b.w = q.w2)
-       SELECT q.qid, q.w1, q.w2,
-              CAST(count(DISTINCT h.doc_id) AS BIGINT) AS n_docs,
-              CAST(count(h.doc_id) AS BIGINT) AS n_occ,
-              CAST(min(h.doc_id) AS BIGINT) AS min_doc,
-              CAST(max(h.doc_id) AS BIGINT) AS max_doc
-       FROM q LEFT JOIN hit h ON q.qid = h.qid
-       GROUP BY q.qid, q.w1, q.w2""",
-)
-def q244(spark, sf_dir):
-    """Positional-inverted-index phrase retrieval (the search-engine
-    primitive a crawled-corpus serving stack needs): the corpus
-    explodes once into (doc, pos, word) postings; a phrase query
-    (w1, w2) matches where w1's postings join w2's at pos+1 in the
-    same doc.  Queries derive from the first two tokens of docs 0-2
-    (broadcast to every postings partition — the probe side is tiny,
-    the postings side is the 10^12-doc table sharded by word).  Emits
-    per-query doc frequency, occurrence count, and doc-id range.
-    Plan: selective word filter -> broadcast-joined probe -> one
-    (doc,pos)-keyed equi-join — never a full doc scan per query."""
-    t = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "filter(split(text, ' '), w -> w != '') AS tk"
-    )
-    tok = t.select(
-        "doc_id", F.posexplode("tk").alias("p0", "w")
-    ).selectExpr("doc_id", "p0 + 1 AS pos", "w")
-    q = t.filter("doc_id < 3").selectExpr(
-        "doc_id AS qid", "tk[0] AS w1", "tk[1] AS w2"
-    )
-    a = tok.select("doc_id", "pos", F.col("w").alias("wa"))
-    b = tok.select(
-        F.col("doc_id").alias("doc_b"),
-        (F.col("pos") - 1).alias("pos_b"),
-        F.col("w").alias("wb"),
-    )
-    hit = (
-        F.broadcast(q).join(a, F.col("wa") == F.col("w1"))
-        .join(
-            b,
-            (F.col("doc_b") == F.col("doc_id"))
-            & (F.col("pos_b") == F.col("pos"))
-            & (F.col("wb") == F.col("w2")),
-        )
-        .select("qid", "doc_id", "pos")
-    )
-    return (
-        q.join(hit, "qid", "left")
-        .groupBy("qid", "w1", "w2")
-        .agg(
-            F.countDistinct("doc_id").cast("long").alias("n_docs"),
-            F.count("doc_id").cast("long").alias("n_occ"),
-            F.min("doc_id").cast("long").alias("min_doc"),
-            F.max("doc_id").cast("long").alias("max_doc"),
-        )
-    )
 
 
 # --- gdaldem hillshade -multidirectional (q245) --------------------------------------
@@ -12022,6 +8969,7 @@ _MD_S, _MD_C225, _MD_CZ, _MD_SQZ = (repr(v) for v in _hsmd_consts())
                           / sqrt(1.0 + {_MD_SQZ} * xxyy) END AS shade
              FROM v)
        SELECT gx, gy, round(shade, 6) AS shade FROM h""",
+    kind="operator",
 )
 def q245(spark, sf_dir):
     """gdaldem hillshade -multidirectional (USGS OF 92-422;
@@ -12101,6 +9049,7 @@ def _combined_shade_sql(p: str, q: str) -> str:
        pq AS (SELECT gx, gy, {_P_SQL} AS p, {_Q_SQL} AS q FROM g)
        SELECT gx, gy, round({_igor_shade_sql('p', 'q')}, 3) AS shade
        FROM pq""",
+    kind="operator",
 )
 def q246(spark, sf_dir):
     """gdaldem hillshade -igor (Igor Evdokimov's shading;
@@ -12127,6 +9076,7 @@ def q246(spark, sf_dir):
        pq AS (SELECT gx, gy, {_P_SQL} AS p, {_Q_SQL} AS q FROM g)
        SELECT gx, gy, round({_combined_shade_sql('p', 'q')}, 3) AS shade
        FROM pq""",
+    kind="operator",
 )
 def q247(spark, sf_dir):
     """gdaldem hillshade -combined (apps/gdaldem_lib.cpp:1151-1186
@@ -12142,78 +9092,6 @@ def q247(spark, sf_dir):
     return pq.select(
         "gx", "gy",
         F.round(F.expr(_combined_shade_sql("p", "q")), 3).alias("shade"),
-    )
-
-
-# --- raster histogram matching / quantile mapping (q248) -----------------------------
-
-
-@query(
-    "q248_hist_match",
-    """WITH g AS (SELECT gx.range AS gx, gy.range AS gy
-                   FROM range(128) gx, range(128) gy),
-       src AS (SELECT gx, gy,
-                  CAST((gx*7 + gy*13) % 97 + (gx*gx) % 23 AS BIGINT) AS v
-               FROM g),
-       ref AS (SELECT gx, gy,
-                  CAST((gx*11 + gy*5) % 89 + (gy*gy) % 31 AS BIGINT) AS v
-               FROM g),
-       hs AS (SELECT v, count(*) AS c FROM src GROUP BY v),
-       cs AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM hs),
-       hr AS (SELECT v, count(*) AS c FROM ref GROUP BY v),
-       cr AS (SELECT v, sum(c) OVER (ORDER BY v) AS cum FROM hr),
-       ns AS (SELECT CAST(128*128 AS BIGINT) AS nsrc,
-                     CAST(128*128 AS BIGINT) AS nref),
-       lut AS (SELECT cs.v, min(cr.v) AS t
-               FROM cs, cr, ns
-               WHERE cr.cum * ns.nsrc >= cs.cum * ns.nref
-               GROUP BY cs.v)
-       SELECT l.v, CAST(l.t AS BIGINT) AS t,
-              CAST(h.c AS BIGINT) AS n_px
-       FROM lut l JOIN hs h USING (v)""",
-)
-def q248(spark, sf_dir):
-    """Histogram matching (quantile mapping): remap every source pixel
-    value v to the smallest reference value t whose reference CDF
-    reaches the source CDF at v — the radiometric-normalization step
-    a mosaic pipeline runs before compositing scenes (the reference's
-    gdalenhance histogram machinery, apps/gdalenhance.cpp, generalized
-    from equalize-to-uniform to equalize-to-REFERENCE).  The CDF
-    comparison is exact integer cross-multiplication
-    (cumR(t)*Nsrc >= cumS(v)*Nref — no division, engine-identical);
-    both CDFs live on the VALUE domain (byte-bounded at any raster
-    size), so the LUT build is a ~256x256 broadcast join and the
-    apply is one broadcast LUT join per pixel, the q214/q163
-    pattern."""
-    g = spark.range(128).select(F.col("id").alias("gx")).crossJoin(
-        spark.range(128).select(F.col("id").alias("gy")))
-    src = g.select(
-        "gx", "gy",
-        ((F.col("gx") * 7 + F.col("gy") * 13) % 97
-         + (F.col("gx") * F.col("gx")) % 23).cast("long").alias("v"),
-    )
-    ref = g.select(
-        "gx", "gy",
-        ((F.col("gx") * 11 + F.col("gy") * 5) % 89
-         + (F.col("gy") * F.col("gy")) % 31).cast("long").alias("v"),
-    )
-    hs = src.groupBy("v").agg(F.count("*").alias("c"))
-    cs = hs.withColumn("cum", F.sum("c").over(Window.orderBy("v")))
-    hr = ref.groupBy("v").agg(F.count("*").alias("c"))
-    cr = hr.withColumn("cum", F.sum("c").over(Window.orderBy("v")))
-    n = F.lit(128 * 128).cast("long")
-    lut = (
-        cs.select(F.col("v"), F.col("cum").alias("cums"))
-        .crossJoin(F.broadcast(
-            cr.select(F.col("v").alias("t"), F.col("cum").alias("cumr"))))
-        .filter(F.col("cumr") * n >= F.col("cums") * n)
-        .groupBy("v")
-        .agg(F.min("t").alias("t"))
-    )
-    return (
-        lut.join(hs, "v")
-        .select("v", F.col("t").cast("long").alias("t"),
-                F.col("c").cast("long").alias("n_px"))
     )
 
 
@@ -12278,7 +9156,7 @@ def _viterbi_oracle_sql() -> str:
        FROM v JOIN fin f ON f.word = v.word AND f.pos = length(v.word)""")
 
 
-@query("q249_unigram_viterbi", _viterbi_oracle_sql())
+@query("q249_unigram_viterbi", _viterbi_oracle_sql(), kind="operator")
 def q249(spark, sf_dir):
     """Unigram-LM tokenizer APPLY (SentencePiece, arXiv:1804.10959):
     Viterbi-segment every vocabulary word by minimum total piece cost
@@ -12349,635 +9227,6 @@ def q249(spark, sf_dir):
     )
 
 
-# --- MinHash LSH candidate quality: precision/recall eval (q250) ---------------------
-
-_MH_EVAL_CTE = f"""d AS (SELECT doc_id, text FROM ({DOCS_WITH_DUPS_SQL})
-                WHERE doc_id % 3 = 0),
-       tk AS (SELECT doc_id,
-                 list_filter(string_split(text, ' '), x -> x <> '') AS toks
-              FROM d),
-       toks AS (SELECT DISTINCT doc_id, tok FROM (
-           SELECT doc_id,
-                  unnest(list_transform(range(1, greatest(len(toks) - 1, 1)),
-                         i -> array_to_string(list_slice(toks, i, i + 2),
-                                              ' '))) AS tok
-           FROM tk)),
-       sigs AS (SELECT doc_id,
-                min(md5(tok || 's0')) AS sig0, min(md5(tok || 's1')) AS sig1,
-                min(md5(tok || 's2')) AS sig2, min(md5(tok || 's3')) AS sig3,
-                min(md5(tok || 's4')) AS sig4, min(md5(tok || 's5')) AS sig5,
-                min(md5(tok || 's6')) AS sig6, min(md5(tok || 's7')) AS sig7
-                FROM toks GROUP BY doc_id),
-       buckets AS (
-         SELECT doc_id, 0 AS band,
-                md5(sig0 || sig1 || sig2 || sig3) AS bucket FROM sigs
-         UNION ALL
-         SELECT doc_id, 1 AS band,
-                md5(sig4 || sig5 || sig6 || sig7) AS bucket FROM sigs),
-       cand AS (SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-                FROM buckets l JOIN buckets r USING (band, bucket)
-                WHERE l.doc_id < r.doc_id),
-       sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-       inter AS (SELECT ta.doc_id AS a, tb.doc_id AS b, count(*) AS inter
-                 FROM toks ta JOIN toks tb
-                   ON tb.tok = ta.tok AND ta.doc_id < tb.doc_id
-                 GROUP BY 1, 2),
-       truth AS (SELECT i.a, i.b FROM inter i
-                 JOIN sizes sa ON sa.doc_id = i.a
-                 JOIN sizes sb ON sb.doc_id = i.b
-                 WHERE 2 * i.inter >= sa.n + sb.n - i.inter)"""
-
-
-@query(
-    "q250_minhash_eval",
-    f"""WITH {_MH_EVAL_CTE}
-       SELECT CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_truth,
-              CAST((SELECT count(*) FROM cand) AS BIGINT) AS n_cand,
-              CAST((SELECT count(*) FROM cand c JOIN truth t
-                    ON c.a = t.a AND c.b = t.b) AS BIGINT) AS n_hit""",
-)
-def q250(spark, sf_dir):
-    """MinHash-LSH candidate QUALITY measurement (the methodology
-    query a 10^12-doc dedup rollout runs before committing to band
-    parameters, q139's recall@5 pattern applied to q18's banding):
-    ground truth = all pairs with exact word-bigram Jaccard >= 0.5
-    (via the shared-token inverted index — 2*inter >= union in exact
-    integers, no division), candidates = the raw 2-band minhash
-    bucket pairs BEFORE verification.  Emits (n_truth, n_cand,
-    n_hit): recall = hit/truth, precision = hit/cand.  Truth
-    generation shuffles on the token vocabulary, candidates on
-    bucket hashes — both linear; the doc_id%3 slice bounds the
-    fixture, not the operator."""
-    d = _docs_with_dups(spark, sf_dir).filter("doc_id % 3 = 0")
-    toks = d.selectExpr(
-        "doc_id",
-        "explode(array_distinct(transform("
-        "sequence(1, greatest(size(filter(split(text, ' '), x -> x != '')) - 2, 1)), "
-        "i -> array_join(slice(filter(split(text, ' '), x -> x != ''), i, 3), ' ')"
-        "))) AS tok",
-    ).distinct()
-    sigs = toks.groupBy("doc_id").agg(
-        *[F.min(F.md5(F.concat(F.col("tok"), F.lit(f"s{i}")))).alias(f"sig{i}")
-          for i in range(8)]
-    )
-    b0 = sigs.select(
-        "doc_id", F.lit(0).alias("band"),
-        F.md5(F.concat("sig0", "sig1", "sig2", "sig3")).alias("bucket"))
-    b1 = sigs.select(
-        "doc_id", F.lit(1).alias("band"),
-        F.md5(F.concat("sig4", "sig5", "sig6", "sig7")).alias("bucket"))
-    buckets = b0.unionAll(b1)
-    l = buckets.select(F.col("doc_id").alias("a"), "band", "bucket")
-    r = buckets.select(F.col("doc_id").alias("b"), "band", "bucket")
-    cand = (l.join(r, ["band", "bucket"]).filter("a < b")
-            .select("a", "b").distinct())
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ta = toks.select(F.col("doc_id").alias("a"), "tok")
-    tb = toks.select(F.col("doc_id").alias("b"), "tok")
-    inter = (ta.join(tb, "tok").filter("a < b")
-             .groupBy("a", "b").agg(F.count("*").alias("inter")))
-    truth = (
-        inter.join(sizes.withColumnRenamed("doc_id", "a")
-                   .withColumnRenamed("n", "na"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b")
-              .withColumnRenamed("n", "nb"), "b")
-        .filter(2 * F.col("inter") >= F.col("na") + F.col("nb") - F.col("inter"))
-        .select("a", "b")
-    )
-    # one materializing job: full-outer join the two pair sets and
-    # count membership flags in a single aggregation (three separate
-    # .count() jobs re-executed the sig/inter chains three times)
-    j = cand.withColumn("_c", F.lit(1)).join(
-        truth.withColumn("_t", F.lit(1)), ["a", "b"], "full_outer")
-    row = j.agg(
-        F.sum(F.coalesce("_t", F.lit(0))).alias("n_truth"),
-        F.sum(F.coalesce("_c", F.lit(0))).alias("n_cand"),
-        F.sum(F.coalesce("_t", F.lit(0))
-              * F.coalesce("_c", F.lit(0))).alias("n_hit"),
-    ).collect()[0]
-    return spark.createDataFrame(
-        [(row["n_truth"], row["n_cand"], row["n_hit"])],
-        "n_truth BIGINT, n_cand BIGINT, n_hit BIGINT")
-
-
-# --- coverage clean: gap/overlap absorption (q251) -----------------------------------
-
-_COV_TILES_SQL = """SELECT k.range AS id,
-                    (k.range % 5)*4 + CASE WHEN k.range = 7 THEN 1 ELSE 0 END
-                        AS x0,
-                    (k.range // 5)*4 AS y0,
-                    (k.range % 5)*4 + CASE WHEN k.range = 7 THEN 1 ELSE 0 END
-                        + 4 AS x1,
-                    (k.range // 5)*4 + 4 AS y1
-             FROM range(25) k"""
-
-
-@query(
-    "q251_coverage_clean",
-    f"""WITH RECURSIVE r AS ({_COV_TILES_SQL}),
-       cells AS (SELECT gx.range AS cx, gy.range AS cy
-                 FROM range(20) gx, range(20) gy),
-       cov AS (SELECT c.cx, c.cy, count(t.id) AS n_owners,
-                      min(t.id) AS min_owner
-               FROM cells c LEFT JOIN r t
-                 ON c.cx >= t.x0 AND c.cx < t.x1
-                AND c.cy >= t.y0 AND c.cy < t.y1
-               GROUP BY c.cx, c.cy),
-       sp AS (SELECT cx, cy,
-                     CASE WHEN n_owners = 0 THEN 'gap'
-                          ELSE 'overlap' END AS kind
-              FROM cov WHERE n_owners <> 1),
-       adj AS (SELECT a.cx AS ax, a.cy AS ay, b.cx AS bx, b.cy AS by
-               FROM sp a JOIN sp b
-                 ON a.kind = b.kind
-                AND abs(a.cx - b.cx) + abs(a.cy - b.cy) = 1),
-       lab AS (SELECT cx, cy, cx*32 + cy AS lbl FROM sp
-               UNION
-               SELECT a.ax, a.ay, l.lbl
-               FROM lab l JOIN adj a ON a.bx = l.cx AND a.by = l.cy),
-       lbl AS (SELECT s.cx, s.cy, s.kind, min(l.lbl) AS lbl
-               FROM sp s JOIN lab l ON l.cx = s.cx AND l.cy = s.cy
-               GROUP BY s.cx, s.cy, s.kind),
-       nb AS (SELECT l.lbl, l.kind, v.min_owner AS owner
-              FROM lbl l
-              JOIN (VALUES (1, 0), (-1, 0), (0, 1), (0, -1)) d(dx, dy)
-                ON TRUE
-              JOIN cov v ON v.cx = l.cx + d.dx AND v.cy = l.cy + d.dy
-              WHERE v.n_owners = 1),
-       sc AS (SELECT lbl, kind, owner, count(*) AS cnt
-              FROM nb GROUP BY lbl, kind, owner),
-       asg AS (SELECT lbl, kind, max(cnt*32 + (31 - owner)) AS code
-               FROM sc GROUP BY lbl, kind),
-       sz AS (SELECT lbl, kind, count(*) AS n_cells
-              FROM lbl GROUP BY lbl, kind)
-       SELECT s.kind, CAST(s.lbl AS BIGINT) AS region,
-              CAST(s.n_cells AS BIGINT) AS n_cells,
-              CAST(31 - (a.code % 32) AS BIGINT) AS assigned_to
-       FROM sz s JOIN asg a ON a.lbl = s.lbl AND a.kind = s.kind""",
-)
-def q251(spark, sf_dir):
-    """Coverage CLEANING (the GEOS CoverageCleaner contract behind
-    gdal vector clean-coverage; completes the q225 check / q234
-    simplify trio): every GAP face (cells no polygon covers) and
-    every OVERLAP face (cells >= 2 polygons cover) is absorbed into
-    the neighboring polygon sharing the LONGEST boundary, ties to the
-    smallest polygon id.  On the q225 integer tiling the faces are
-    unit-grid cell components: components by min-label propagation
-    over 4-adjacency (engine: pointer rounds with a loud cap; oracle:
-    a recursive CTE to fixpoint), shared-boundary length = count of
-    cell edges into unique-owner cells, and the argmax is the single
-    integer max(cnt*32 + (31 - owner)) — map-side combinable, ties
-    encoded, no window.  The shifted tile 7 creates exactly one gap
-    face and one overlap face, both 4 cells."""
-    r = spark.range(25).selectExpr(
-        "id",
-        "(id % 5)*4 + CASE WHEN id = 7 THEN 1 ELSE 0 END AS x0",
-        "CAST(id / 5 AS BIGINT)*4 AS y0",
-        "(id % 5)*4 + CASE WHEN id = 7 THEN 1 ELSE 0 END + 4 AS x1",
-        "CAST(id / 5 AS BIGINT)*4 + 4 AS y1",
-    )
-    cells = spark.range(20).selectExpr("id AS cx").crossJoin(
-        spark.range(20).selectExpr("id AS cy"))
-    cov = (
-        cells.join(
-            r,
-            (F.col("cx") >= F.col("x0")) & (F.col("cx") < F.col("x1"))
-            & (F.col("cy") >= F.col("y0")) & (F.col("cy") < F.col("y1")),
-            "left",
-        )
-        .groupBy("cx", "cy")
-        .agg(F.count("id").alias("n_owners"), F.min("id").alias("min_owner"))
-        .localCheckpoint(eager=True)
-    )
-    sp = cov.filter("n_owners <> 1").selectExpr(
-        "cx", "cy",
-        "CASE WHEN n_owners = 0 THEN 'gap' ELSE 'overlap' END AS kind",
-    )
-    lbl = sp.withColumn("lbl", F.col("cx") * 32 + F.col("cy"))
-    lbl = lbl.localCheckpoint(eager=True)
-    for _round in range(16):
-        a = lbl.selectExpr("cx AS ax", "cy AS ay", "kind AS kinda",
-                           "lbl AS la")
-        b = lbl.selectExpr("cx AS bx", "cy AS by", "kind AS kindb",
-                           "lbl AS lb")
-        nxt = (
-            a.join(
-                b,
-                (F.col("kinda") == F.col("kindb"))
-                & ((F.abs(F.col("ax") - F.col("bx"))
-                    + F.abs(F.col("ay") - F.col("by"))) == 1),
-            )
-            .groupBy("ax", "ay", "kinda")
-            .agg(F.min("lb").alias("nmin"))
-            .localCheckpoint(eager=True)
-        )
-        merged = (
-            lbl.join(
-                nxt,
-                (F.col("cx") == F.col("ax")) & (F.col("cy") == F.col("ay"))
-                & (F.col("kind") == F.col("kinda")), "left")
-            .select(
-                "cx", "cy", "kind",
-                F.least(F.col("lbl"),
-                        F.coalesce("nmin", F.col("lbl"))).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            merged.alias("m").join(
-                lbl.alias("o"), ["cx", "cy", "kind"])
-            .filter("m.lbl <> o.lbl").count()
-        )
-        lbl.unpersist()
-        lbl = merged
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError("q251 label propagation did not converge")
-    d = spark.createDataFrame(
-        [(1, 0), (-1, 0), (0, 1), (0, -1)], "dx INT, dy INT")
-    nb = (
-        lbl.crossJoin(F.broadcast(d))
-        .join(
-            cov.selectExpr("cx AS nx", "cy AS ny", "n_owners", "min_owner"),
-            (F.col("nx") == F.col("cx") + F.col("dx"))
-            & (F.col("ny") == F.col("cy") + F.col("dy")),
-        )
-        .filter("n_owners = 1")
-        .select("lbl", "kind", F.col("min_owner").alias("owner"))
-    )
-    sc = nb.groupBy("lbl", "kind", "owner").agg(F.count("*").alias("cnt"))
-    asg = sc.groupBy("lbl", "kind").agg(
-        F.max(F.col("cnt") * 32 + (31 - F.col("owner"))).alias("code"))
-    sz = lbl.groupBy("lbl", "kind").agg(F.count("*").alias("n_cells"))
-    return sz.join(asg, ["lbl", "kind"]).select(
-        "kind",
-        F.col("lbl").cast("long").alias("region"),
-        F.col("n_cells").cast("long").alias("n_cells"),
-        (31 - (F.col("code") % 32)).cast("long").alias("assigned_to"),
-    )
-
-
-# --- crawl frontier politeness scheduling (q252) -------------------------------------
-
-
-@query(
-    "q252_frontier_schedule",
-    """WITH req AS (SELECT doc_id, doc_id % 40 AS host,
-                       n_chars AS priority
-                FROM documents),
-       slot AS (SELECT doc_id, host, priority,
-                   row_number() OVER (PARTITION BY host
-                       ORDER BY priority DESC, doc_id) - 1 AS host_slot
-                FROM req),
-       tmd AS (SELECT doc_id, host, host_slot,
-                  host % 8 AS thread, host_slot * 5 AS ready
-               FROM slot),
-       tick AS (SELECT doc_id, host, thread, host_slot, ready,
-                   row_number() OVER (PARTITION BY thread
-                       ORDER BY ready, host, doc_id) AS tick
-                FROM tmd)
-       SELECT doc_id, CAST(host AS BIGINT) AS host,
-              CAST(thread AS BIGINT) AS thread,
-              CAST(host_slot AS BIGINT) AS host_slot,
-              CAST(tick AS BIGINT) AS tick
-       FROM tick""",
-)
-def q252(spark, sf_dir):
-    """Crawl-frontier politeness scheduling (the Heritrix/Nutch
-    frontier contract): requests queue per HOST ordered by priority
-    (ties to lowest doc id); each host releases one fetch every 5
-    ticks (politeness delay -> ready = slot*5); hosts shard onto 8
-    fetcher threads by hash, and each thread executes its merged
-    ready-ordered queue one fetch per tick (ties host, then doc).
-    Two window passes — one partitioned by host, one by thread; both
-    keys shard across executors, nothing global.  Emits the full
-    deterministic schedule a 10^12-page recrawl would replay."""
-    req = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "doc_id % 40 AS host", "n_chars AS priority")
-    wh = Window.partitionBy("host").orderBy(
-        F.col("priority").desc(), F.col("doc_id"))
-    slot = req.withColumn("host_slot", F.row_number().over(wh) - 1)
-    tmd = slot.selectExpr(
-        "doc_id", "host", "host_slot",
-        "host % 8 AS thread", "host_slot * 5 AS ready")
-    wt = Window.partitionBy("thread").orderBy("ready", "host", "doc_id")
-    return tmd.withColumn("tick", F.row_number().over(wt)).select(
-        "doc_id",
-        F.col("host").cast("long").alias("host"),
-        F.col("thread").cast("long").alias("thread"),
-        F.col("host_slot").cast("long").alias("host_slot"),
-        F.col("tick").cast("long").alias("tick"),
-    )
-
-
-# --- SCD2 recrawl history with change suppression (q253) -----------------------------
-
-
-@query(
-    "q253_recrawl_history",
-    """WITH cap AS (SELECT doc_id,
-                       'u' || CAST(doc_id % 120 AS STRING) AS url,
-                       1767225600 + ((doc_id * 37) % 1000) * 3600 AS ts,
-                       (doc_id * doc_id) % 7 AS digest
-                FROM documents),
-       seq AS (SELECT *, lag(digest) OVER (PARTITION BY url
-                       ORDER BY ts, doc_id) AS prev
-               FROM cap),
-       chg AS (SELECT doc_id, url, ts, digest FROM seq
-               WHERE prev IS NULL OR digest <> prev),
-       scd AS (SELECT url, doc_id, ts AS valid_from, digest,
-                  row_number() OVER (PARTITION BY url
-                      ORDER BY ts, doc_id) AS version,
-                  lead(ts) OVER (PARTITION BY url
-                      ORDER BY ts, doc_id) AS valid_to
-               FROM chg)
-       SELECT url, CAST(version AS BIGINT) AS version,
-              CAST(valid_from AS BIGINT) AS valid_from,
-              CAST(coalesce(valid_to, 0) AS BIGINT) AS valid_to,
-              CAST(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS BIGINT)
-                  AS is_current,
-              CAST(digest AS BIGINT) AS digest
-       FROM scd""",
-)
-def q253(spark, sf_dir):
-    """SCD-2 recrawl history (the warehouse pattern a CDX/WARC store
-    uses to answer 'what did this url say at time T'): per-url capture
-    stream ordered by (ts, doc_id); consecutive captures with an
-    UNCHANGED digest are suppressed (no new version); surviving rows
-    become versioned validity intervals [valid_from, valid_to) with
-    the open current row flagged.  Two url-partitioned window passes
-    (lag for suppression, lead/row_number for intervals) — shuffles
-    on url only, the natural key a 10^12-capture store is already
-    bucketed by."""
-    cap = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        "concat('u', CAST(doc_id % 120 AS STRING)) AS url",
-        "1767225600 + ((doc_id * 37) % 1000) * 3600 AS ts",
-        "(doc_id * doc_id) % 7 AS digest",
-    )
-    w = Window.partitionBy("url").orderBy("ts", "doc_id")
-    chg = (
-        cap.withColumn("prev", F.lag("digest").over(w))
-        .filter("prev IS NULL OR digest <> prev")
-        .select("doc_id", "url", "ts", "digest")
-    )
-    scd = (
-        chg.withColumn("version", F.row_number().over(w))
-        .withColumn("valid_to", F.lead("ts").over(w))
-    )
-    return scd.select(
-        "url",
-        F.col("version").cast("long").alias("version"),
-        F.col("ts").cast("long").alias("valid_from"),
-        F.coalesce("valid_to", F.lit(0)).cast("long").alias("valid_to"),
-        F.when(F.col("valid_to").isNull(), 1).otherwise(0).cast("long")
-            .alias("is_current"),
-        F.col("digest").cast("long").alias("digest"),
-    )
-
-
-# --- WARC shard layout + offset index (q254) -----------------------------------------
-
-
-@query(
-    "q254_warc_layout",
-    """WITH rec AS (SELECT doc_id, n_chars + 64 AS nbytes FROM documents),
-       cum AS (SELECT doc_id, nbytes,
-                  coalesce(sum(nbytes) OVER (ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                      AS start_byte
-               FROM rec),
-       sh AS (SELECT doc_id, nbytes, start_byte,
-                 start_byte // 16384 AS shard
-              FROM cum),
-       off AS (SELECT shard, min(start_byte) AS shard_base FROM sh
-               GROUP BY shard)
-       SELECT s.doc_id, CAST(s.shard AS BIGINT) AS shard,
-              CAST(s.start_byte - o.shard_base AS BIGINT) AS offset,
-              CAST(s.nbytes AS BIGINT) AS nbytes
-       FROM sh s JOIN off o ON s.shard = o.shard""",
-)
-def q254(spark, sf_dir):
-    """WARC-writer shard layout + CDX offset index: records (body +
-    64-byte header) concatenate in doc order; a record's shard is
-    floor(global_start / 16 KiB) (the greedy size-target cut a WARC
-    writer makes) and its CDX offset is relative to the shard's first
-    record.  One global cumulative sum (at 10^12 records: the
-    two-pass partition-count prefix sum, same pattern as
-    operators/suffix.py ordinals) + one per-shard min — this IS the
-    index CDX serves range requests from."""
-    rec = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "n_chars + 64 AS nbytes")
-    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
-    cum = rec.withColumn(
-        "start_byte", F.coalesce(F.sum("nbytes").over(w), F.lit(0)))
-    sh = cum.withColumn("shard", F.floor(F.col("start_byte") / 16384))
-    off = sh.groupBy("shard").agg(F.min("start_byte").alias("shard_base"))
-    return sh.join(off, "shard").select(
-        "doc_id",
-        F.col("shard").cast("long").alias("shard"),
-        (F.col("start_byte") - F.col("shard_base")).cast("long")
-            .alias("offset"),
-        F.col("nbytes").cast("long").alias("nbytes"),
-    )
-
-
-# --- point-in-time lookup over SCD2 intervals (q255) ---------------------------------
-
-
-@query(
-    "q255_point_in_time",
-    """WITH cap AS (SELECT doc_id,
-                       'u' || CAST(doc_id % 120 AS STRING) AS url,
-                       1767225600 + ((doc_id * 37) % 1000) * 3600 AS ts,
-                       (doc_id * doc_id) % 7 AS digest
-                FROM documents),
-       seq AS (SELECT *, lag(digest) OVER (PARTITION BY url
-                       ORDER BY ts, doc_id) AS prev
-               FROM cap),
-       chg AS (SELECT doc_id, url, ts, digest FROM seq
-               WHERE prev IS NULL OR digest <> prev),
-       scd AS (SELECT url, ts AS valid_from, digest,
-                  lead(ts) OVER (PARTITION BY url
-                      ORDER BY ts, doc_id) AS valid_to
-               FROM chg),
-       q AS (SELECT k.range AS qid,
-                'u' || CAST((k.range * 7) % 120 AS STRING) AS url,
-                1767225600 + ((k.range * 131) % 1000) * 3600 AS qt
-             FROM range(50) k)
-       SELECT q.qid, q.url, CAST(q.qt AS BIGINT) AS qt,
-              CAST(s.digest AS BIGINT) AS digest,
-              CAST(s.valid_from AS BIGINT) AS valid_from
-       FROM q JOIN scd s
-         ON s.url = q.url AND s.valid_from <= q.qt
-        AND (s.valid_to IS NULL OR q.qt < s.valid_to)""",
-)
-def q255(spark, sf_dir):
-    """Point-in-time serving over the q253 SCD-2 store ('what did
-    this url say at time T'): 50 (url, T) probes interval-join the
-    versioned history — equi-join on url plus the validity-range
-    predicate, exactly the plan a time-travel lookup compiles to
-    (url equi-key carries the shuffle; the range residual filters
-    in-place, no extra pass).  Probes whose T precedes the first
-    capture drop out (inner join) — the contract a CDX replay
-    endpoint implements."""
-    cap = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        "concat('u', CAST(doc_id % 120 AS STRING)) AS url",
-        "1767225600 + ((doc_id * 37) % 1000) * 3600 AS ts",
-        "(doc_id * doc_id) % 7 AS digest",
-    )
-    w = Window.partitionBy("url").orderBy("ts", "doc_id")
-    chg = (
-        cap.withColumn("prev", F.lag("digest").over(w))
-        .filter("prev IS NULL OR digest <> prev")
-    )
-    scd = chg.select(
-        "url", F.col("ts").alias("valid_from"), "digest",
-        F.lead("ts").over(w).alias("valid_to"),
-    )
-    q = spark.range(50).selectExpr(
-        "id AS qid",
-        "concat('u', CAST((id * 7) % 120 AS STRING)) AS url",
-        "1767225600 + ((id * 131) % 1000) * 3600 AS qt",
-    )
-    return (
-        q.join(
-            scd,
-            (q.url == scd.url) & (F.col("valid_from") <= F.col("qt"))
-            & (F.col("valid_to").isNull() | (F.col("qt") < F.col("valid_to"))),
-        )
-        .select(
-            "qid", q.url.alias("url"),
-            F.col("qt").cast("long").alias("qt"),
-            F.col("digest").cast("long").alias("digest"),
-            F.col("valid_from").cast("long").alias("valid_from"),
-        )
-    )
-
-
-# --- TF-IDF keyword extraction, integer-exact ranking (q256) --------------------------
-
-
-@query(
-    "q256_tfidf_keywords",
-    """WITH t AS (SELECT doc_id,
-                [w for w in string_split(text, ' ') if w <> ''] AS toks
-             FROM documents),
-       e AS (SELECT doc_id, unnest(toks) AS w FROM t),
-       tf AS (SELECT doc_id, w, count(*) AS tf FROM e GROUP BY 1, 2),
-       df AS (SELECT w, count(DISTINCT doc_id) AS df FROM e GROUP BY w),
-       nn AS (SELECT count(DISTINCT doc_id) AS n FROM e),
-       sc AS (SELECT tf.doc_id, tf.w,
-                 tf.tf * (length(bin((SELECT n FROM nn)))
-                          - length(bin(df.df))) AS score
-              FROM tf JOIN df ON tf.w = df.w),
-       ms AS (SELECT doc_id, max(score) AS ms FROM sc GROUP BY doc_id)
-       SELECT s.doc_id, min(s.w) AS keyword,
-              CAST(max(s.score) AS BIGINT) AS score
-       FROM sc s JOIN ms m ON m.doc_id = s.doc_id AND s.score = m.ms
-       GROUP BY s.doc_id""",
-)
-def q256(spark, sf_dir):
-    """Per-document keyword extraction by integer-exact TF-IDF: score
-    = tf * (floorlog2(N) - floorlog2(df)) with the bin()-length
-    integer log (q243 pattern) — no float idf, engines agree bitwise.
-    The winner per doc is (max score, lexicographically smallest
-    word): one map-side-combinable struct aggregation in the engine,
-    no window over the term table.  TF shuffles on (doc, word), DF on
-    the word vocabulary — both linear at 10^12 docs."""
-    e = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "explode(filter(split(text, ' '), w -> w != '')) AS w")
-    tf = e.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
-    df = e.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
-    n = e.agg(F.countDistinct("doc_id").alias("n"))
-    sc = (
-        tf.join(F.broadcast(df), "w")
-        .crossJoin(F.broadcast(n))
-        .selectExpr(
-            "doc_id", "w",
-            "tf * (length(bin(n)) - length(bin(df))) AS score")
-    )
-    # argmax (score desc, word asc) == struct-max on (score, negated word)?
-    # strings can't negate: max(struct(score, w)) picks max word among
-    # ties — mirror the oracle instead: min word among max-score rows.
-    ms = sc.groupBy("doc_id").agg(F.max("score").alias("ms"))
-    return (
-        sc.join(ms, "doc_id")
-        .filter(F.col("score") == F.col("ms"))
-        .groupBy("doc_id")
-        .agg(F.min("w").alias("keyword"),
-             F.max("score").cast("long").alias("score"))
-    )
-
-
-# --- link-spam signals: reciprocity + degree skew (q257) -----------------------------
-
-
-@query(
-    "q257_link_spam_signals",
-    """WITH e0 AS (SELECT doc_id % 40 AS src,
-                      (doc_id * 7 + doc_id // 40) % 40 AS dst
-               FROM documents),
-       e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-       outd AS (SELECT src AS host, count(*) AS out_deg FROM e GROUP BY src),
-       ind AS (SELECT dst AS host, count(*) AS in_deg FROM e GROUP BY dst),
-       rec AS (SELECT a.src AS host, count(*) AS recip
-               FROM e a JOIN e b ON a.src = b.dst AND a.dst = b.src
-               GROUP BY a.src),
-       m AS (SELECT o.host, o.out_deg,
-                    coalesce(i.in_deg, 0) AS in_deg,
-                    coalesce(r.recip, 0) AS recip
-             FROM outd o
-             LEFT JOIN ind i ON i.host = o.host
-             LEFT JOIN rec r ON r.host = o.host)
-       SELECT host, CAST(out_deg AS BIGINT) AS out_deg,
-              CAST(in_deg AS BIGINT) AS in_deg,
-              CAST(recip AS BIGINT) AS recip,
-              CAST(CASE WHEN 2 * recip >= out_deg AND out_deg >= 3
-                   THEN 1 ELSE 0 END AS BIGINT) AS spam_flag
-       FROM m""",
-)
-def q257(spark, sf_dir):
-    """Link-farm signals over the host graph (the web-spam features a
-    crawl-curation pipeline feeds its domain classifier): distinct
-    out/in degree and RECIPROCAL edge count (a->b and b->a — the
-    link-exchange fingerprint) via one reversed self-equi-join; flag
-    = reciprocity covering >= half the out-links with out-degree >=
-    3, exact integer cross-multiplication.  Edges dedup on (src,
-    dst), the reversed join keys on the same pair — everything
-    shuffles on host pairs, linear in the edge list at 10^12 pages."""
-    e = (
-        _t(spark, sf_dir, "documents")
-        .selectExpr(
-            "doc_id % 40 AS src",
-            "(doc_id * 7 + doc_id div 40) % 40 AS dst")
-        .filter("src <> dst").distinct()
-        .localCheckpoint(eager=True)
-    )
-    outd = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-    ind = e.groupBy("dst").agg(F.count("*").alias("in_deg"))
-    rev = e.selectExpr("dst AS src", "src AS dst")
-    rec = e.join(rev, ["src", "dst"]).groupBy("src").agg(
-        F.count("*").alias("recip"))
-    m = (
-        outd.withColumnRenamed("src", "host")
-        .join(ind.withColumnRenamed("dst", "host"), "host", "left")
-        .join(rec.withColumnRenamed("src", "host"), "host", "left")
-        .fillna(0, ["in_deg", "recip"])
-    )
-    return m.select(
-        "host",
-        F.col("out_deg").cast("long").alias("out_deg"),
-        F.col("in_deg").cast("long").alias("in_deg"),
-        F.col("recip").cast("long").alias("recip"),
-        F.when((2 * F.col("recip") >= F.col("out_deg"))
-               & (F.col("out_deg") >= 3), 1).otherwise(0)
-        .cast("long").alias("spam_flag"),
-    )
-
-
 # --- FM-index backward-search pattern count (q258) -----------------------------------
 
 _FM_PATTERNS = ["the", "row", "zzz"]  # two corpus words + one miss
@@ -13000,7 +9249,7 @@ def _fm_oracle_sql() -> str:
        FROM pat LEFT JOIN hit h ON h.p = pat.p"""
 
 
-@query("q258_fm_index_count", _fm_oracle_sql())
+@query("q258_fm_index_count", _fm_oracle_sql(), kind="operator")
 def q258(spark, sf_dir):
     """FM-index pattern counting by BWT backward search (Ferragina &
     Manzini 2000) over the q236 suffix array: BWT[r] =
@@ -13080,445 +9329,6 @@ def q258(spark, sf_dir):
         rows, "pattern STRING, n_occ BIGINT, lo BIGINT, hi BIGINT")
 
 
-# --- raster set-type: GDALCopyWord conversion rules (q259) ---------------------------
-
-
-@query(
-    "q259_raster_set_type",
-    """WITH g AS (SELECT gx.range AS gx, gy.range AS gy
-                   FROM range(128) gx, range(128) gy),
-       px AS (SELECT gx, gy,
-                 CASE WHEN (gx + gy) % 61 = 0 THEN CAST('NaN' AS DOUBLE)
-                      ELSE CAST((gx*31 + gy*17) % 600 AS DOUBLE) / 7.0
-                           - 30.0 END AS v
-              FROM g),
-       conv AS (SELECT gx, gy, v,
-                 CASE WHEN isnan(v) THEN 0
-                      ELSE CAST(floor(least(greatest(v + 0.5, 0.0), 255.0))
-                           AS BIGINT) END AS b,
-                 CASE WHEN isnan(v * 1000.0) THEN 0
-                      ELSE CAST(CASE
-                        WHEN least(greatest(CASE WHEN v * 1000.0 > 0.0
-                                    THEN v * 1000.0 + 0.5
-                                    ELSE v * 1000.0 - 0.5 END,
-                                -32768.0), 32767.0) >= 0.0
-                        THEN floor(least(greatest(CASE WHEN v * 1000.0 > 0.0
-                                    THEN v * 1000.0 + 0.5
-                                    ELSE v * 1000.0 - 0.5 END,
-                                -32768.0), 32767.0))
-                        ELSE -floor(-least(greatest(CASE WHEN v * 1000.0 > 0.0
-                                    THEN v * 1000.0 + 0.5
-                                    ELSE v * 1000.0 - 0.5 END,
-                                -32768.0), 32767.0))
-                        END AS BIGINT) END AS i16
-              FROM px)
-       SELECT b, i16, CAST(count(*) AS BIGINT) AS n_px,
-              round(min(v), 6) AS v_lo, round(max(v), 6) AS v_hi
-       FROM conv GROUP BY b, i16""",
-)
-def q259(spark, sf_dir):
-    """gdal raster set-type under the reference's EXACT GDALCopyWord
-    conversion rules (gcore/gdal_priv_templates.hpp:433-710):
-    float->unsigned (Byte): NaN -> 0, else truncate(clamp(v + 0.5,
-    0, 255)) — round-half-up with saturation; float->signed (Int16):
-    NaN -> 0, else truncate(clamp(v > 0 ? v + 0.5 : v - 0.5, -32768,
-    32767)) — round half AWAY FROM ZERO (the signed rule differs
-    from the unsigned one on purpose, :640-708).  Truncation is
-    spelled floor/-floor(-x) so DuckDB's rounding CAST never enters;
-    the v*1000 channel exercises both saturation rails.  One JVM
-    projection + a histogram groupBy."""
-    g = spark.range(128).selectExpr("id AS gx").crossJoin(
-        spark.range(128).selectExpr("id AS gy"))
-    px = g.selectExpr(
-        "gx", "gy",
-        "CASE WHEN (gx + gy) % 61 = 0 THEN CAST('NaN' AS DOUBLE) "
-        "ELSE CAST((gx*31 + gy*17) % 600 AS DOUBLE) / 7.0 - 30.0 END AS v",
-    )
-    w = F.col("v") * 1000.0
-    half_away = F.when(w > 0.0, w + 0.5).otherwise(w - 0.5)
-    cl = F.least(F.greatest(half_away, F.lit(-32768.0)), F.lit(32767.0))
-    trunc = F.when(cl >= 0.0, F.floor(cl)).otherwise(-F.floor(-cl))
-    conv = px.select(
-        "v",
-        F.when(F.isnan("v"), 0).otherwise(
-            F.floor(F.least(F.greatest(F.col("v") + 0.5, F.lit(0.0)),
-                            F.lit(255.0)))
-        ).cast("long").alias("b"),
-        F.when(F.isnan(w), 0).otherwise(trunc).cast("long").alias("i16"),
-    )
-    return conv.groupBy("b", "i16").agg(
-        F.count("*").cast("long").alias("n_px"),
-        F.round(F.min("v"), 6).alias("v_lo"),
-        F.round(F.max("v"), 6).alias("v_hi"),
-    )
-
-
-# --- raster update: window overwrite with nodata transparency (q260) -----------------
-
-
-@query(
-    "q260_raster_update",
-    """WITH g AS (SELECT gx.range AS gx, gy.range AS gy
-                   FROM range(128) gx, range(128) gy),
-       a AS (SELECT gx, gy, (gx*7 + gy*13) % 97 AS v FROM g),
-       b AS (SELECT px.range AS bx, py.range AS by,
-                    (px.range*5 + py.range*3) % 11 AS v
-             FROM range(32) px, range(32) py),
-       upd AS (SELECT a.gx, a.gy, a.v AS old_v,
-                  CASE WHEN b.v IS NOT NULL AND b.v <> 7
-                       THEN b.v ELSE a.v END AS new_v
-               FROM a LEFT JOIN b
-                 ON b.bx = a.gx - 40 AND b.by = a.gy - 60)
-       SELECT CAST(sum(CASE WHEN new_v <> old_v THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_changed,
-              CAST(sum(new_v) AS BIGINT) AS sum_new,
-              CAST(sum(old_v) AS BIGINT) AS sum_old,
-              CAST(sum(CASE WHEN gx >= 40 AND gx < 72 AND gy >= 60
-                             AND gy < 92 AND new_v = old_v
-                        THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_transparent_or_equal
-       FROM upd""",
-)
-def q260(spark, sf_dir):
-    """gdal raster update (apps/gdalalg_raster_update.cpp): burn an
-    update raster into a base raster at a window offset, with the
-    update's nodata (7) transparent — out = patch value where the
-    patch covers and is valid, else the base.  One broadcast left
-    join on shifted coordinates (the patch side is small by
-    definition; at scale the join keys on tile ids and only
-    patch-intersecting tiles rewrite — the manifest-compaction
-    pattern).  Emits the change audit a cautious update job logs."""
-    g = spark.range(128).selectExpr("id AS gx").crossJoin(
-        spark.range(128).selectExpr("id AS gy"))
-    a = g.selectExpr("gx", "gy", "(gx*7 + gy*13) % 97 AS v")
-    b = (
-        spark.range(32).selectExpr("id AS bx").crossJoin(
-            spark.range(32).selectExpr("id AS by"))
-        .selectExpr("bx", "by", "(bx*5 + by*3) % 11 AS bv")
-    )
-    upd = a.join(
-        F.broadcast(b),
-        (F.col("bx") == F.col("gx") - 40) & (F.col("by") == F.col("gy") - 60),
-        "left",
-    ).select(
-        "gx", "gy", F.col("v").alias("old_v"),
-        F.when(F.col("bv").isNotNull() & (F.col("bv") != 7), F.col("bv"))
-        .otherwise(F.col("v")).alias("new_v"),
-    )
-    inpatch = ((F.col("gx") >= 40) & (F.col("gx") < 72)
-               & (F.col("gy") >= 60) & (F.col("gy") < 92))
-    return upd.agg(
-        F.sum(F.when(F.col("new_v") != F.col("old_v"), 1).otherwise(0))
-        .cast("long").alias("n_changed"),
-        F.sum("new_v").cast("long").alias("sum_new"),
-        F.sum("old_v").cast("long").alias("sum_old"),
-        F.sum(F.when(inpatch & (F.col("new_v") == F.col("old_v")), 1)
-              .otherwise(0)).cast("long").alias("n_transparent_or_equal"),
-    )
-
-
-# --- raster nodata-to-alpha (q261) ----------------------------------------------------
-
-
-@query(
-    "q261_nodata_to_alpha",
-    """WITH g AS (SELECT gx.range AS gx, gy.range AS gy
-                   FROM range(128) gx, range(128) gy),
-       px AS (SELECT gx, gy, (gx*7 + gy*13) % 97 AS v FROM g),
-       al AS (SELECT gx, gy, v,
-                 CASE WHEN v = 42 THEN 0 ELSE 255 END AS alpha
-              FROM px)
-       SELECT CAST(alpha AS BIGINT) AS alpha,
-              CAST(count(*) AS BIGINT) AS n_px,
-              CAST(min(v) AS BIGINT) AS v_lo,
-              CAST(max(v) AS BIGINT) AS v_hi
-       FROM al GROUP BY alpha""",
-)
-def q261(spark, sf_dir):
-    """gdal raster nodata-to-alpha (apps/gdalalg_raster_nodata_to_
-    alpha.cpp): append an alpha band that is 0 exactly where the band
-    equals its nodata value (42) and 255 elsewhere — the conversion
-    that lets a mosaic compositor treat nodata as transparency.  One
-    JVM projection; emitted as the alpha histogram with the value
-    span per class."""
-    g = spark.range(128).selectExpr("id AS gx").crossJoin(
-        spark.range(128).selectExpr("id AS gy"))
-    px = g.selectExpr("gx", "gy", "(gx*7 + gy*13) % 97 AS v")
-    al = px.withColumn(
-        "alpha", F.when(F.col("v") == 42, 0).otherwise(255))
-    return al.groupBy("alpha").agg(
-        F.count("*").cast("long").alias("n_px"),
-        F.min("v").cast("long").alias("v_lo"),
-        F.max("v").cast("long").alias("v_hi"),
-    ).select(F.col("alpha").cast("long").alias("alpha"),
-             "n_px", "v_lo", "v_hi")
-
-
-# --- vector check-geometry: per-ring validity flags (q262) ---------------------------
-
-_CHKGEO_RING_SQL = """
-    CASE id % 5
-      WHEN 1 THEN [x0, x0+4, x0+4, x0, x0]
-      WHEN 2 THEN [x0, x0+4, x0+4, x0+4, x0, x0]
-      WHEN 3 THEN [x0, x0+4, x0+4, x0]
-      WHEN 4 THEN [x0, x0+4, x0]
-      ELSE [x0, x0+4, x0+4, x0, x0] END AS xs,
-    CASE id % 5
-      WHEN 1 THEN [y0, y0+4, y0, y0+4, y0]
-      WHEN 2 THEN [y0, y0, y0, y0+4, y0+4, y0]
-      WHEN 3 THEN [y0, y0, y0+4, y0+4]
-      WHEN 4 THEN [y0, y0, y0]
-      ELSE [y0, y0, y0+4, y0+4, y0] END AS ys
-"""
-
-
-@query(
-    "q262_check_geometry",
-    f"""WITH f AS (SELECT k.range AS id,
-                      (k.range * 13) % 50 AS x0, (k.range * 17) % 50 AS y0
-               FROM range(50) k),
-       r AS (SELECT id, {_CHKGEO_RING_SQL} FROM f),
-       m AS (SELECT id, xs, ys, len(xs) AS np FROM r),
-       ed AS (SELECT id, i,
-                 xs[i] AS ax, ys[i] AS ay, xs[i+1] AS bx, ys[i+1] AS by
-              FROM (SELECT id, xs, ys,
-                       unnest([i for i in range(1, 10)
-                               if i < len(xs)]) AS i
-                    FROM m)),
-       dup AS (SELECT id, max(CASE WHEN ax = bx AND ay = by
-                             THEN 1 ELSE 0 END) AS has_dup
-               FROM ed GROUP BY id),
-       xp AS (SELECT a.id,
-                 max(CASE WHEN
-                   ((a.bx-a.ax)*(b.ay-a.ay) - (a.by-a.ay)*(b.ax-a.ax)) *
-                   ((a.bx-a.ax)*(b.by-a.ay) - (a.by-a.ay)*(b.bx-a.ax)) < 0
-                   AND
-                   ((b.bx-b.ax)*(a.ay-b.ay) - (b.by-b.ay)*(a.ax-b.ax)) *
-                   ((b.bx-b.ax)*(a.by-b.ay) - (b.by-b.ay)*(a.bx-b.ax)) < 0
-                   THEN 1 ELSE 0 END) AS has_x
-              FROM ed a JOIN ed b
-                ON a.id = b.id AND a.i < b.i
-               AND NOT ((a.ax = b.ax AND a.ay = b.ay)
-                     OR (a.ax = b.bx AND a.ay = b.by)
-                     OR (a.bx = b.ax AND a.by = b.ay)
-                     OR (a.bx = b.bx AND a.by = b.by))
-              GROUP BY a.id),
-       fl AS (SELECT m.id,
-                 CASE WHEN m.xs[1] = m.xs[m.np] AND m.ys[1] = m.ys[m.np]
-                      THEN 1 ELSE 0 END AS closed,
-                 CASE WHEN m.np >= 5 THEN 1 ELSE 0 END AS enough_pts,
-                 1 - coalesce(d.has_dup, 0) AS no_dup,
-                 1 - coalesce(x.has_x, 0) AS no_selfx
-              FROM m
-              LEFT JOIN dup d ON d.id = m.id
-              LEFT JOIN xp x ON x.id = m.id)
-       SELECT id, CAST(closed AS BIGINT) AS closed,
-              CAST(enough_pts AS BIGINT) AS enough_pts,
-              CAST(no_dup AS BIGINT) AS no_dup,
-              CAST(no_selfx AS BIGINT) AS no_selfx,
-              CAST(closed * enough_pts * no_dup * no_selfx AS BIGINT)
-                  AS valid
-       FROM fl""",
-)
-def q262(spark, sf_dir):
-    """gdal vector check-geometry (apps/gdalalg_vector_check_geometry
-    .cpp; OGC Simple Features §6.1.11 ring rules): per-feature flags
-    for ring closure, minimum point count (>= 4 distinct + closing),
-    duplicate consecutive vertices, and PROPER self-intersection via
-    the exact integer double-orientation test (d1*d2 < 0 and
-    d3*d4 < 0 on cross products, endpoint-sharing edge pairs
-    excluded).  The fixture cycles five shapes: valid square, bowtie
-    (crossing), repeated vertex, unclosed ring, degenerate 3-point
-    ring — each flag fires on a known id class.  Edge pairs explode
-    per feature (bounded by ring vertex count); all predicates
-    integer-exact."""
-    f = spark.range(50).selectExpr(
-        "id", "(id * 13) % 50 AS x0", "(id * 17) % 50 AS y0")
-    r = f.selectExpr(
-        "id",
-        """CASE CAST(id % 5 AS INT)
-          WHEN 1 THEN array(x0, x0+4, x0+4, x0, x0)
-          WHEN 2 THEN array(x0, x0+4, x0+4, x0+4, x0, x0)
-          WHEN 3 THEN array(x0, x0+4, x0+4, x0)
-          WHEN 4 THEN array(x0, x0+4, x0)
-          ELSE array(x0, x0+4, x0+4, x0, x0) END AS xs""",
-        """CASE CAST(id % 5 AS INT)
-          WHEN 1 THEN array(y0, y0+4, y0, y0+4, y0)
-          WHEN 2 THEN array(y0, y0, y0, y0+4, y0+4, y0)
-          WHEN 3 THEN array(y0, y0, y0+4, y0+4)
-          WHEN 4 THEN array(y0, y0, y0)
-          ELSE array(y0, y0, y0+4, y0+4, y0) END AS ys""",
-    )
-    m = r.selectExpr("id", "xs", "ys", "size(xs) AS np")
-    ed = m.selectExpr(
-        "id", "explode(sequence(1, size(xs) - 1)) AS i", "xs", "ys"
-    ).selectExpr(
-        "id", "i",
-        "element_at(xs, i) AS ax", "element_at(ys, i) AS ay",
-        "element_at(xs, i + 1) AS bx", "element_at(ys, i + 1) AS by",
-    ).localCheckpoint(eager=True)
-    dup = ed.groupBy("id").agg(
-        F.max(F.when((F.col("ax") == F.col("bx"))
-                     & (F.col("ay") == F.col("by")), 1).otherwise(0))
-        .alias("has_dup"))
-    a = ed
-    b = ed.selectExpr("id", "i AS j", "ax AS cx", "ay AS cy",
-                      "bx AS dx", "by AS dy")
-    share = (
-        ((F.col("ax") == F.col("cx")) & (F.col("ay") == F.col("cy")))
-        | ((F.col("ax") == F.col("dx")) & (F.col("ay") == F.col("dy")))
-        | ((F.col("bx") == F.col("cx")) & (F.col("by") == F.col("cy")))
-        | ((F.col("bx") == F.col("dx")) & (F.col("by") == F.col("dy")))
-    )
-    d1 = ((F.col("bx") - F.col("ax")) * (F.col("cy") - F.col("ay"))
-          - (F.col("by") - F.col("ay")) * (F.col("cx") - F.col("ax")))
-    d2 = ((F.col("bx") - F.col("ax")) * (F.col("dy") - F.col("ay"))
-          - (F.col("by") - F.col("ay")) * (F.col("dx") - F.col("ax")))
-    d3 = ((F.col("dx") - F.col("cx")) * (F.col("ay") - F.col("cy"))
-          - (F.col("dy") - F.col("cy")) * (F.col("ax") - F.col("cx")))
-    d4 = ((F.col("dx") - F.col("cx")) * (F.col("by") - F.col("cy"))
-          - (F.col("dy") - F.col("cy")) * (F.col("bx") - F.col("cx")))
-    xp = (
-        a.join(b, "id").filter((F.col("i") < F.col("j")) & ~share)
-        .groupBy("id")
-        .agg(F.max(F.when((d1 * d2 < 0) & (d3 * d4 < 0), 1).otherwise(0))
-             .alias("has_x"))
-    )
-    fl = (
-        m.join(dup, "id", "left").join(xp, "id", "left")
-        .selectExpr(
-            "id",
-            "CASE WHEN element_at(xs, 1) = element_at(xs, np) AND "
-            "element_at(ys, 1) = element_at(ys, np) THEN 1 ELSE 0 END"
-            " AS closed",
-            "CASE WHEN np >= 5 THEN 1 ELSE 0 END AS enough_pts",
-            "1 - coalesce(has_dup, 0) AS no_dup",
-            "1 - coalesce(has_x, 0) AS no_selfx",
-        )
-    )
-    return fl.select(
-        "id",
-        F.col("closed").cast("long").alias("closed"),
-        F.col("enough_pts").cast("long").alias("enough_pts"),
-        F.col("no_dup").cast("long").alias("no_dup"),
-        F.col("no_selfx").cast("long").alias("no_selfx"),
-        (F.col("closed") * F.col("enough_pts") * F.col("no_dup")
-         * F.col("no_selfx")).cast("long").alias("valid"),
-    )
-
-
-# --- vector dissolve by attribute (q263) ----------------------------------------------
-
-
-@query(
-    "q263_vector_dissolve",
-    """WITH RECURSIVE rct AS (SELECT k.range AS id, k.range % 5 AS grp,
-                    (k.range * 7) % 30 AS x0, (k.range * 11) % 30 AS y0,
-                    (k.range * 7) % 30 + 3 + k.range % 4 AS x1,
-                    (k.range * 11) % 30 + 3 + k.range % 3 AS y1
-             FROM range(60) k),
-       cell AS (SELECT gx.range AS cx, gy.range AS cy
-                FROM range(36) gx, range(36) gy),
-       cov AS (SELECT DISTINCT r.grp, c.cx, c.cy
-               FROM cell c JOIN rct r
-                 ON c.cx >= r.x0 AND c.cx < r.x1
-                AND c.cy >= r.y0 AND c.cy < r.y1),
-       area AS (SELECT grp, count(*) AS union_area FROM cov GROUP BY grp),
-       adj AS (SELECT a.grp, a.id AS ai, b.id AS bi
-               FROM rct a JOIN rct b
-                 ON a.grp = b.grp
-                AND a.x0 <= b.x1 AND b.x0 <= a.x1
-                AND a.y0 <= b.y1 AND b.y0 <= a.y1),
-       lab AS (SELECT grp, id AS node, id AS lbl FROM rct
-               UNION
-               SELECT a.grp, a.ai, l.lbl
-               FROM lab l JOIN adj a ON a.grp = l.grp AND a.bi = l.node),
-       comp AS (SELECT grp, node, min(lbl) AS root FROM lab
-                GROUP BY grp, node),
-       parts AS (SELECT grp, count(DISTINCT root) AS n_parts
-                 FROM comp GROUP BY grp),
-       cnt AS (SELECT grp, count(*) AS n_rects FROM rct GROUP BY grp)
-       SELECT c.grp, CAST(c.n_rects AS BIGINT) AS n_rects,
-              CAST(a.union_area AS BIGINT) AS union_area,
-              CAST(p.n_parts AS BIGINT) AS n_parts
-       FROM cnt c JOIN area a ON a.grp = c.grp
-       JOIN parts p ON p.grp = c.grp""",
-)
-def q263(spark, sf_dir):
-    """gdal vector dissolve (apps/gdalalg_vector_dissolve semantics —
-    ogr2ogr's GROUP BY + ST_Union): merge every feature sharing an
-    attribute into one multipolygon, reporting exact union AREA
-    (distinct covered unit cells — correct under arbitrary overlap)
-    and the number of connected PARTS (components of the
-    touch-or-overlap graph over rects: closed-interval bbox
-    intersection, min-label propagation — engine: capped pointer
-    rounds; oracle: recursive CTE to fixpoint, the q251 pattern).
-    Area counting shuffles on (grp, cell), component finding on the
-    per-group rect graph — the group key shards both at scale."""
-    rct = spark.range(60).selectExpr(
-        "id", "id % 5 AS grp",
-        "(id * 7) % 30 AS x0", "(id * 11) % 30 AS y0",
-        "(id * 7) % 30 + 3 + id % 4 AS x1",
-        "(id * 11) % 30 + 3 + id % 3 AS y1",
-    ).localCheckpoint(eager=True)
-    cell = spark.range(36).selectExpr("id AS cx").crossJoin(
-        spark.range(36).selectExpr("id AS cy"))
-    cov = (
-        cell.join(
-            F.broadcast(rct),
-            (F.col("cx") >= F.col("x0")) & (F.col("cx") < F.col("x1"))
-            & (F.col("cy") >= F.col("y0")) & (F.col("cy") < F.col("y1")),
-        )
-        .select("grp", "cx", "cy").distinct()
-    )
-    area = cov.groupBy("grp").agg(F.count("*").alias("union_area"))
-    a = rct.selectExpr("grp", "id AS ai", "x0", "y0", "x1", "y1")
-    b = rct.selectExpr("grp AS grpb", "id AS bi", "x0 AS bx0", "y0 AS by0",
-                       "x1 AS bx1", "y1 AS by1")
-    adj = (
-        a.join(b, (F.col("grp") == F.col("grpb"))
-               & (F.col("x0") <= F.col("bx1")) & (F.col("bx0") <= F.col("x1"))
-               & (F.col("y0") <= F.col("by1")) & (F.col("by0") <= F.col("y1")))
-        .select("grp", "ai", "bi")
-        .localCheckpoint(eager=True)
-    )
-    lbl = rct.selectExpr("grp", "id AS node", "id AS lbl")
-    lbl = lbl.localCheckpoint(eager=True)
-    for _round in range(16):
-        nxt = (
-            adj.join(lbl.selectExpr("grp AS g2", "node AS bi2", "lbl AS lb"),
-                     (F.col("grp") == F.col("g2"))
-                     & (F.col("bi") == F.col("bi2")))
-            .groupBy("grp", "ai").agg(F.min("lb").alias("nmin"))
-        )
-        merged = (
-            lbl.join(nxt, (lbl.grp == nxt.grp) & (lbl.node == nxt.ai), "left")
-            .select(lbl.grp, lbl.node,
-                    F.least(lbl.lbl, F.coalesce("nmin", lbl.lbl)).alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            merged.selectExpr("grp", "node", "lbl AS l2")
-            .join(lbl, ["grp", "node"]).filter("l2 <> lbl").count()
-        )
-        lbl.unpersist()
-        lbl = merged
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError("q263 dissolve components did not converge")
-    parts = (
-        lbl.groupBy("grp").agg(F.countDistinct("lbl").alias("n_parts")))
-    cnt = rct.groupBy("grp").agg(F.count("*").alias("n_rects"))
-    return (
-        cnt.join(area, "grp").join(parts, "grp")
-        .select("grp",
-                F.col("n_rects").cast("long").alias("n_rects"),
-                F.col("union_area").cast("long").alias("union_area"),
-                F.col("n_parts").cast("long").alias("n_parts"))
-    )
-
-
 # --- gdaldem aspect (azimuth degrees) + slope percent (q264-q265) --------------------
 
 
@@ -13540,6 +9350,7 @@ def _aspect_sql(p: str, q: str, scale: str = "8.0") -> str:
        pq AS (SELECT gx, gy, {_P_SQL} AS p, {_Q_SQL} AS q FROM g)
        SELECT gx, gy, round({_aspect_sql('p', 'q')}, 3) AS aspect
        FROM pq""",
+    kind="operator",
 )
 def q264(spark, sf_dir):
     """gdaldem aspect in AZIMUTH DEGREES (GDALAspectAlg,
@@ -13568,6 +9379,7 @@ def q264(spark, sf_dir):
               round(100.0 * sqrt(64.0 * (p*p) + 64.0 * (q*q)) * 0.125, 6)
                   AS slope_pct
        FROM pq""",
+    kind="operator",
 )
 def q265(spark, sf_dir):
     """gdaldem slope -p (percent slope, GDALSlopeHornAlg percent
@@ -13587,65 +9399,6 @@ def q265(spark, sf_dir):
     )
 
 
-# --- hard-negative mining for embedding training (q266) ------------------------------
-
-
-@query(
-    "q266_hard_negatives",
-    """WITH v AS (SELECT vec_id, label,
-                list_transform(embedding,
-                    x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                    AS qv
-             FROM embeddings),
-       q AS (SELECT vec_id AS qid, label AS qlab, qv AS qqv FROM v
-             WHERE vec_id % 10 = 0),
-       pr AS (SELECT q.qid, v.vec_id AS cand,
-                 CAST(list_sum(list_transform(list_zip(q.qqv, v.qv),
-                      s -> s[1]*s[2])) AS BIGINT) AS dot
-              FROM q JOIN v ON v.label <> q.qlab),
-       best AS (SELECT qid, max(dot * 100000 + (99999 - cand)) AS code
-                FROM pr GROUP BY qid)
-       SELECT b.qid,
-              CAST(99999 - (b.code % 100000) AS BIGINT) AS neg_id,
-              CAST((b.code - (b.code % 100000)) // 100000 AS BIGINT)
-                  AS neg_dot
-       FROM best b""",
-)
-def q266(spark, sf_dir):
-    """Hard-negative mining (the contrastive-training data op an
-    embedding pipeline runs per epoch): for each query vector, the
-    DIFFERENT-label candidate with maximum integer-quantized inner
-    product, ties to the lowest candidate id — encoded as the single
-    integer argmax dot*100000 + (99999 - cand), map-side combinable,
-    no window over the candidate table.  The query side broadcasts;
-    candidate work is |Q| x |C| inside each partition (at 10^12 scale
-    the candidate side pre-filters through the q127 IVF cells, the
-    SemDeDup pattern — the mining rule itself is unchanged)."""
-    v = _t(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id", "label",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qv",
-    )
-    q = v.filter("vec_id % 10 = 0").selectExpr(
-        "vec_id AS qid", "label AS qlab", "qv AS qqv")
-    pr = (
-        F.broadcast(q).join(v, F.col("label") != F.col("qlab"))
-        .selectExpr(
-            "qid", "vec_id AS cand",
-            "aggregate(zip_with(qqv, qv, (x, y) -> x*y), "
-            "CAST(0 AS BIGINT), (a, x) -> a + x) AS dot",
-        )
-    )
-    best = pr.groupBy("qid").agg(
-        F.max(F.col("dot") * 100000 + (99999 - F.col("cand"))).alias("code"))
-    return best.select(
-        "qid",
-        (99999 - (F.col("code") % 100000)).cast("long").alias("neg_id"),
-        F.floor((F.col("code") - (F.col("code") % 100000)) / 100000)
-            .cast("long").alias("neg_dot"),
-    )
-
-
 # --- tokenizer fertility statistics (q267) --------------------------------------------
 
 
@@ -13660,6 +9413,7 @@ def q266(spark, sf_dir):
               CAST(sum(cnt * length(word)) AS BIGINT) AS n_chars
        FROM w{_BPE_ROUNDS} GROUP BY 1""",
     ),
+    kind="operator",
 )
 def q267(spark, sf_dir):
     """Tokenizer FERTILITY statistics (tokens-per-word — the metric
@@ -13717,6 +9471,7 @@ def _binom5_oracle_terms() -> str:
                 CAST({_binom5_oracle_terms()} AS DOUBLE) / 256.0 AS sm
              FROM i)
        SELECT gx, gy, sm FROM s WHERE sm <> 0""",
+    kind="operator",
 )
 def q268(spark, sf_dir):
     """5x5 binomial (Gaussian-approximating) smoothing — the
@@ -13750,696 +9505,12 @@ def q268(spark, sf_dir):
     ).select("gx", "gy", F.col("v").alias("sm"))
 
 
-# --- inverted-index compression accounting: Elias gamma (q269) ------------------------
-
-
-@query(
-    "q269_postings_gamma_bits",
-    """WITH t AS (SELECT doc_id,
-                [w for w in string_split(text, ' ') if w <> ''] AS toks
-             FROM documents),
-       e AS (SELECT DISTINCT doc_id, unnest(toks) AS w FROM t),
-       g AS (SELECT w, doc_id,
-                doc_id - lag(doc_id) OVER (PARTITION BY w ORDER BY doc_id)
-                    AS gap
-             FROM e),
-       bits AS (SELECT w,
-                  count(*) AS df,
-                  sum(CASE WHEN gap IS NULL
-                       THEN 2 * (length(bin(doc_id + 1)) - 1) + 1
-                       ELSE 2 * (length(bin(gap)) - 1) + 1 END)
-                      AS gamma_bits,
-                  count(*) * 64 AS raw_bits
-               FROM g GROUP BY w)
-       SELECT w, CAST(df AS BIGINT) AS df,
-              CAST(gamma_bits AS BIGINT) AS gamma_bits,
-              CAST(raw_bits AS BIGINT) AS raw_bits,
-              CAST(CASE WHEN gamma_bits * 4 <= raw_bits THEN 1 ELSE 0 END
-                   AS BIGINT) AS compresses_4x
-       FROM bits""",
-)
-def q269(spark, sf_dir):
-    """Inverted-index size accounting under Elias-gamma gap coding
-    (the capacity-planning pass a 10^12-doc index build runs before
-    choosing a postings format): per term, sort postings by doc id,
-    gap-encode (first entry stores doc_id+1), and charge the exact
-    gamma cost 2*floor(log2 g) + 1 bits per gap — floor-log2 is the
-    bin()-length integer idiom, so both engines count identical bits.
-    One term-partitioned window for the gaps + one aggregation;
-    everything shuffles on the term vocabulary."""
-    e = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id", "explode(filter(split(text, ' '), w -> w != '')) AS w"
-    ).distinct()
-    w = Window.partitionBy("w").orderBy("doc_id")
-    g = e.withColumn("gap", F.col("doc_id") - F.lag("doc_id").over(w))
-    gamma = F.when(
-        F.col("gap").isNull(),
-        2 * (F.length(F.expr("bin(doc_id + 1)")) - 1) + 1,
-    ).otherwise(2 * (F.length(F.expr("bin(gap)")) - 1) + 1)
-    bits = g.groupBy("w").agg(
-        F.count("*").alias("df"),
-        F.sum(gamma).alias("gamma_bits"),
-        (F.count("*") * 64).alias("raw_bits"),
-    )
-    return bits.select(
-        "w",
-        F.col("df").cast("long").alias("df"),
-        F.col("gamma_bits").cast("long").alias("gamma_bits"),
-        F.col("raw_bits").cast("long").alias("raw_bits"),
-        F.when(F.col("gamma_bits") * 4 <= F.col("raw_bits"), 1).otherwise(0)
-        .cast("long").alias("compresses_4x"),
-    )
-
-
-# --- MVT LineString command-stream encode (q270) --------------------------------------
-
-
-@query(
-    "q270_mvt_line_encode",
-    """WITH v AS (SELECT k.range // 5 AS line_id, k.range % 5 AS seq,
-                    ((k.range // 5) * 37 + (k.range % 5) * 41) % 256 AS x,
-                    ((k.range // 5) * 53 + ((k.range % 5) * (k.range % 5))
-                     * 29) % 256 AS y
-             FROM range(100) k),
-       d AS (SELECT line_id, seq, x, y,
-                lag(x) OVER (PARTITION BY line_id ORDER BY seq) AS px,
-                lag(y) OVER (PARTITION BY line_id ORDER BY seq) AS py
-             FROM v),
-       kept AS (SELECT * FROM d
-                WHERE px IS NULL OR x <> px OR y <> py),
-       d2 AS (SELECT line_id, seq, x, y,
-                 x - lag(x) OVER (PARTITION BY line_id ORDER BY seq) AS dx,
-                 y - lag(y) OVER (PARTITION BY line_id ORDER BY seq) AS dy
-              FROM kept),
-       zz AS (SELECT line_id,
-                 count(*) AS n_out,
-                 sum(CASE WHEN dx IS NULL THEN
-                       (CASE WHEN x >= 0 THEN 2*x ELSE -2*x - 1 END)
-                     + (CASE WHEN y >= 0 THEN 2*y ELSE -2*y - 1 END)
-                     ELSE
-                       (CASE WHEN dx >= 0 THEN 2*dx ELSE -2*dx - 1 END)
-                     + (CASE WHEN dy >= 0 THEN 2*dy ELSE -2*dy - 1 END)
-                     END) AS zz_sum
-              FROM d2 GROUP BY line_id),
-       n_in AS (SELECT line_id, count(*) AS n_pts FROM v GROUP BY line_id)
-       SELECT z.line_id,
-              CAST(i.n_pts AS BIGINT) AS n_in,
-              CAST(z.n_out AS BIGINT) AS n_out,
-              CAST(9 AS BIGINT) AS cmd_move,
-              CAST((z.n_out - 1) * 8 + 2 AS BIGINT) AS cmd_line,
-              CAST(z.zz_sum AS BIGINT) AS zz_sum
-       FROM zz z JOIN n_in i ON i.line_id = z.line_id""",
-)
-def q270(spark, sf_dir):
-    """MVT LineString geometry-command encode (the OGR MVT writer,
-    ogr/ogrsf_frmts/mvt/mvtutils.cpp; Mapbox Vector Tile spec §4.3):
-    consecutive duplicate quantized vertices collapse, the first
-    vertex becomes MoveTo (command integer 9 = 1<<3 | 1), the rest
-    one LineTo run ((n-1)<<3 | 2), and every coordinate delta is
-    zigzag-encoded (2d if d>=0 else -2d-1).  Emits per line the
-    in/out vertex counts, command integers, and the exact zigzag
-    parameter sum — all integer, both engines bitwise.  Two
-    line-partitioned windows (collapse, then delta); shards on
-    line_id."""
-    v = spark.range(100).selectExpr(
-        "id div 5 AS line_id", "id % 5 AS seq",
-        "((id div 5) * 37 + (id % 5) * 41) % 256 AS x",
-        "((id div 5) * 53 + ((id % 5) * (id % 5)) * 29) % 256 AS y",
-    )
-    w = Window.partitionBy("line_id").orderBy("seq")
-    d = v.withColumn("px", F.lag("x").over(w)).withColumn(
-        "py", F.lag("y").over(w))
-    kept = d.filter(
-        F.col("px").isNull() | (F.col("x") != F.col("px"))
-        | (F.col("y") != F.col("py")))
-    d2 = kept.withColumn("dx", F.col("x") - F.lag("x").over(w)).withColumn(
-        "dy", F.col("y") - F.lag("y").over(w))
-
-    def _zz(c):
-        return F.when(F.col(c) >= 0, 2 * F.col(c)).otherwise(
-            -2 * F.col(c) - 1)
-
-    first = _zz("x") + _zz("y")
-    rest = _zz("dx") + _zz("dy")
-    zz = d2.groupBy("line_id").agg(
-        F.count("*").alias("n_out"),
-        F.sum(F.when(F.col("dx").isNull(), first).otherwise(rest))
-        .alias("zz_sum"),
-    )
-    n_in = v.groupBy("line_id").agg(F.count("*").alias("n_pts"))
-    return zz.join(n_in, "line_id").select(
-        "line_id",
-        F.col("n_pts").cast("long").alias("n_in"),
-        F.col("n_out").cast("long").alias("n_out"),
-        F.lit(9).cast("long").alias("cmd_move"),
-        ((F.col("n_out") - 1) * 8 + 2).cast("long").alias("cmd_line"),
-        F.col("zz_sum").cast("long").alias("zz_sum"),
-    )
-
-
-# --- raster time-series linear trend, exact integers (q271) ---------------------------
-
-
-@query(
-    "q271_raster_trend",
-    """WITH g AS (SELECT gx.range AS gx, gy.range AS gy
-                   FROM range(64) gx, range(64) gy),
-       ts AS (SELECT gx, gy, t.range AS t,
-                 (gx*3 + gy*5) % 50 + t.range * ((gx + gy) % 7)
-                 + (t.range * t.range * (gx % 3)) % 5 AS v
-              FROM g, range(12) t),
-       s AS (SELECT gx, gy,
-                count(*) AS n, sum(t) AS sx, sum(v) AS sy,
-                sum(t*v) AS sxy, sum(t*t) AS sxx
-             FROM ts GROUP BY gx, gy),
-       tr AS (SELECT gx, gy,
-                 n*sxy - sx*sy AS slope_num,
-                 n*sxx - sx*sx AS slope_den
-              FROM s)
-       SELECT CAST(slope_num AS BIGINT) AS slope_num,
-              CAST(slope_den AS BIGINT) AS slope_den,
-              CAST(CASE WHEN slope_num > 0 THEN 1
-                        WHEN slope_num < 0 THEN -1 ELSE 0 END AS BIGINT)
-                  AS trend_sign,
-              CAST(count(*) AS BIGINT) AS n_px
-       FROM tr GROUP BY slope_num, slope_den""",
-)
-def q271(spark, sf_dir):
-    """Per-pixel linear TREND over a raster time series (the NDVI
-    trend-analysis workload a 'gdal raster stack' feeds): ordinary
-    least squares slope per pixel, kept as the EXACT integer rational
-    (n*Sxy - Sx*Sy) / (n*Sxx - Sx^2) — numerator and denominator emit
-    as integers, so both engines agree bitwise with no float
-    regression anywhere.  One groupBy over (pixel) with five
-    map-side-combinable integer sums; the 12-step series explodes
-    from the synthetic stack (at scale: one scan of the band-stacked
-    table, shuffle keyed on pixel).  Output is the trend histogram
-    (slope rational -> pixel count)."""
-    g = spark.range(64).selectExpr("id AS gx").crossJoin(
-        spark.range(64).selectExpr("id AS gy"))
-    ts = g.crossJoin(spark.range(12).selectExpr("id AS t")).selectExpr(
-        "gx", "gy", "t",
-        "(gx*3 + gy*5) % 50 + t * ((gx + gy) % 7) "
-        "+ (t * t * (gx % 3)) % 5 AS v",
-    )
-    s = ts.groupBy("gx", "gy").agg(
-        F.count("*").alias("n"), F.sum("t").alias("sx"),
-        F.sum("v").alias("sy"), F.sum(F.col("t") * F.col("v")).alias("sxy"),
-        F.sum(F.col("t") * F.col("t")).alias("sxx"),
-    )
-    tr = s.select(
-        "gx", "gy",
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        .alias("slope_num"),
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        .alias("slope_den"),
-    )
-    return tr.groupBy("slope_num", "slope_den").agg(
-        F.count("*").cast("long").alias("n_px")
-    ).select(
-        F.col("slope_num").cast("long").alias("slope_num"),
-        F.col("slope_den").cast("long").alias("slope_den"),
-        F.when(F.col("slope_num") > 0, 1)
-        .when(F.col("slope_num") < 0, -1).otherwise(0)
-        .cast("long").alias("trend_sign"),
-        "n_px",
-    )
-
-
-# --- tile-pyramid rollup integrity audit (q272) ----------------------------------------
-
-
-@query(
-    "q272_pyramid_audit",
-    f"""WITH p AS ({POINTS_SQL}),
-       z8 AS (SELECT CAST(floor((lon + 180.0)/360.0*256.0) AS BIGINT) AS tx,
-                     CAST(floor((90.0 - lat)/180.0*256.0) AS BIGINT) AS ty,
-                     count(*) AS n
-              FROM p GROUP BY 1, 2),
-       z7 AS (SELECT tx // 2 AS px, ty // 2 AS py, sum(n) AS n_children,
-                     count(*) AS n_tiles
-              FROM z8 GROUP BY 1, 2),
-       z7d AS (SELECT CAST(floor((lon + 180.0)/360.0*128.0) AS BIGINT) AS px,
-                      CAST(floor((90.0 - lat)/180.0*128.0) AS BIGINT) AS py,
-                      count(*) AS n_direct
-               FROM p GROUP BY 1, 2)
-       SELECT z7.px, z7.py,
-              CAST(z7.n_children AS BIGINT) AS n_children,
-              CAST(d.n_direct AS BIGINT) AS n_direct,
-              CAST(z7.n_tiles AS BIGINT) AS n_child_tiles,
-              CAST(CASE WHEN z7.n_children = d.n_direct THEN 1 ELSE 0 END
-                   AS BIGINT) AS consistent
-       FROM z7 JOIN z7d d ON d.px = z7.px AND d.py = z7.py""",
-)
-def q272(spark, sf_dir):
-    """Tile-pyramid ROLLUP INTEGRITY audit (the data-quality gate a
-    production tile table runs after every incremental maintenance
-    pass, q213's complement): the z7 parent count rolled up from z8
-    children must equal the count aggregated DIRECTLY from the source
-    points — floor(v*128) == floor(v*256)//2 holds exactly for the
-    power-of-two tiling, so `consistent` must be 1 everywhere and any
-    0 pinpoints a corrupted parent.  Two independent aggregation
-    paths over the same source, one equi-join on parent tile —
-    both shuffle on tile keys."""
-    p = _points(spark, sf_dir)
-    fx = (F.col("lon") + 180.0) / 360.0
-    fy = (90.0 - F.col("lat")) / 180.0
-    z8 = p.select(
-        F.floor(fx * 256.0).cast("long").alias("tx"),
-        F.floor(fy * 256.0).cast("long").alias("ty"),
-    ).groupBy("tx", "ty").agg(F.count("*").alias("n"))
-    z7 = z8.selectExpr("tx div 2 AS px", "ty div 2 AS py", "n").groupBy(
-        "px", "py").agg(F.sum("n").alias("n_children"),
-                        F.count("*").alias("n_tiles"))
-    z7d = p.select(
-        F.floor(fx * 128.0).cast("long").alias("px"),
-        F.floor(fy * 128.0).cast("long").alias("py"),
-    ).groupBy("px", "py").agg(F.count("*").alias("n_direct"))
-    return z7.join(z7d, ["px", "py"]).select(
-        "px", "py",
-        F.col("n_children").cast("long").alias("n_children"),
-        F.col("n_direct").cast("long").alias("n_direct"),
-        F.col("n_tiles").cast("long").alias("n_child_tiles"),
-        F.when(F.col("n_children") == F.col("n_direct"), 1).otherwise(0)
-        .cast("long").alias("consistent"),
-    )
-
-
-# --- text normalization + content hash (q273) ------------------------------------------
-
-
-@query(
-    "q273_text_normalize_hash",
-    """WITH d AS (SELECT doc_id,
-                trim(regexp_replace(regexp_replace(lower(text),
-                     '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS norm
-             FROM documents)
-       SELECT doc_id, length(norm) AS n_norm_chars,
-              md5(norm) AS content_hash
-       FROM d""",
-)
-def q273(spark, sf_dir):
-    """Text NORMALIZATION + content hashing (the CCNet/Dolma
-    pre-dedup canonicalization: lowercase, non-alphanumerics to
-    space, whitespace collapse, trim — so near-identical pages hash
-    identically before the exact-dedup groupBy).  The md5 of the
-    normalized text is the dedup key both engines must agree on
-    byte-for-byte; the normalization chain is three JVM regexp passes
-    with patterns chosen inside the RE2/Java-regex common subset.
-    Pure projection — zero shuffle at any corpus size."""
-    d = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        "trim(regexp_replace(regexp_replace(lower(text), "
-        "'[^a-z0-9 ]', ' '), ' +', ' ')) AS norm",
-    )
-    return d.select(
-        "doc_id",
-        F.length("norm").cast("long").alias("n_norm_chars"),
-        F.md5("norm").alias("content_hash"),
-    )
-
-
-# --- eval-set apportionment: largest-remainder method (q274) ---------------------------
-
-
-@query(
-    "q274_eval_apportionment",
-    """WITH s AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-       tot AS (SELECT sum(n) AS N FROM s),
-       q AS (SELECT s.lang, s.n,
-                (s.n * 100) // t.N AS base,
-                (s.n * 100) % t.N AS rem
-             FROM s, tot t),
-       rk AS (SELECT lang, n, base, rem,
-                 row_number() OVER (ORDER BY rem DESC, lang) AS rnk_rem
-              FROM q),
-       gap AS (SELECT 100 - sum(base) AS extra FROM rk)
-       SELECT lang, CAST(n AS BIGINT) AS n_docs,
-              CAST(base + CASE WHEN rnk_rem <= (SELECT extra FROM gap)
-                   THEN 1 ELSE 0 END AS BIGINT) AS quota
-       FROM rk""",
-)
-def q274(spark, sf_dir):
-    """Eval-set APPORTIONMENT by the largest-remainder (Hamilton)
-    method: carve exactly K=100 evaluation slots across languages
-    proportionally — base = floor(n*K/N) per language, the leftover
-    slots go to the largest remainders (ties to lang asc).  All
-    integer (the remainder comparison IS the fraction comparison
-    cross-multiplied); quotas sum to exactly K by construction —
-    the deterministic allocation a multilingual eval harness needs,
-    complementing q208's waterfill (capacity-capped) and q92's
-    stratified sampling (rate-based).  One language-keyed groupBy +
-    one tiny window over the language table."""
-    s = _t(spark, sf_dir, "documents").groupBy("lang").agg(
-        F.count("*").alias("n"))
-    tot = s.agg(F.sum("n").alias("ntot"))  # 'N' would collide with 'n'
-    q = s.crossJoin(F.broadcast(tot)).select(
-        "lang", "n",
-        F.floor(F.col("n") * 100 / F.col("ntot")).alias("base"),
-        ((F.col("n") * 100) % F.col("ntot")).alias("rem"),
-    )
-    w = Window.orderBy(F.col("rem").desc(), F.col("lang"))
-    rk = q.withColumn("rnk_rem", F.row_number().over(w))
-    gap = rk.agg((100 - F.sum("base")).alias("extra"))
-    return rk.crossJoin(F.broadcast(gap)).select(
-        "lang",
-        F.col("n").cast("long").alias("n_docs"),
-        (F.col("base")
-         + F.when(F.col("rnk_rem") <= F.col("extra"), 1).otherwise(0))
-        .cast("long").alias("quota"),
-    )
-
-
-# --- host-graph triangle counting + clustering coefficient (q275) ----------------------
-
-
-@query(
-    "q275_triangles",
-    """WITH e0 AS (SELECT doc_id % 40 AS a,
-                      (doc_id * 7 + doc_id // 40) % 40 AS b
-               FROM documents),
-       ud AS (SELECT DISTINCT least(a, b) AS u, greatest(a, b) AS v
-              FROM e0 WHERE a <> b),
-       deg AS (SELECT x AS node, count(*) AS d FROM
-                 (SELECT u AS x FROM ud UNION ALL SELECT v FROM ud)
-               GROUP BY x),
-       tri AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z
-               FROM ud e1
-               JOIN ud e2 ON e2.u = e1.v
-               JOIN ud e3 ON e3.u = e1.u AND e3.v = e2.v),
-       pern AS (SELECT node, count(*) AS t FROM
-                  (SELECT x AS node FROM tri
-                   UNION ALL SELECT y FROM tri
-                   UNION ALL SELECT z FROM tri)
-                GROUP BY node),
-       cc AS (SELECT d.node, d.d,
-                 coalesce(p.t, 0) AS t,
-                 d.d * (d.d - 1) AS cc_den2
-              FROM deg d LEFT JOIN pern p ON p.node = d.node)
-       SELECT node, CAST(d AS BIGINT) AS degree,
-              CAST(t AS BIGINT) AS triangles,
-              CAST(2 * t AS BIGINT) AS cc_num,
-              CAST(cc_den2 AS BIGINT) AS cc_den
-       FROM cc""",
-)
-def q275(spark, sf_dir):
-    """Triangle counting + local clustering coefficient on the host
-    link graph — the node-iterator join plan that scales (triangles
-    enumerate as ordered wedges u<v<w closed by the (u,w) edge: two
-    edge-table equi-joins, candidate volume bounded by wedge count,
-    never node^3): per-node triangle participation and the exact
-    clustering rational 2t / d(d-1) emitted as integers.  The
-    canonical web-graph cohesion feature (spam farms show abnormally
-    high clustering); everything shuffles on node/edge keys."""
-    e0 = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id % 40 AS a", "(doc_id * 7 + doc_id div 40) % 40 AS b")
-    ud = (
-        e0.filter("a <> b")
-        .selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        ud.selectExpr("u AS x").unionAll(ud.selectExpr("v AS x"))
-        .groupBy("x").agg(F.count("*").alias("d"))
-        .withColumnRenamed("x", "node")
-    )
-    e1 = ud.selectExpr("u AS x", "v AS y")
-    e2 = ud.selectExpr("u AS y", "v AS z")
-    e3 = ud.selectExpr("u AS x", "v AS z")
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
-    pern = (
-        tri.selectExpr("x AS node")
-        .unionAll(tri.selectExpr("y AS node"))
-        .unionAll(tri.selectExpr("z AS node"))
-        .groupBy("node").agg(F.count("*").alias("t"))
-    )
-    return (
-        deg.join(pern, "node", "left")
-        .select(
-            "node",
-            F.col("d").cast("long").alias("degree"),
-            F.coalesce("t", F.lit(0)).cast("long").alias("triangles"),
-            (2 * F.coalesce("t", F.lit(0))).cast("long").alias("cc_num"),
-            (F.col("d") * (F.col("d") - 1)).cast("long").alias("cc_den"),
-        )
-    )
-
-
-# --- k-core decomposition by synchronous peeling (q276) --------------------------------
-
-
-def _kcore_oracle_sql() -> str:
-    # round-synchronous peeling for k = 3, unrolled to a fixpoint
-    # depth the fixture provably reaches (guarded loudly)
-    # every CTE is MATERIALIZED: DuckDB inlines plain CTEs per
-    # reference, and n{t} feeding d{t+1} twice would expand to 2^8
-    # re-scans of the parquet view ("Too many open files")
-    # irregular degree profile (span 2..13) so the k=4 peel is a real
-    # 3-round cascade with a PARTIAL surviving core (49/60)
-    ctes = ["""h AS MATERIALIZED (SELECT DISTINCT doc_id % 60 AS hh
-               FROM documents),
-       e0 AS MATERIALIZED (SELECT hh AS a,
-                      (hh * j + j * j) % 60 AS b
-               FROM (SELECT hh, unnest([jj for jj in range(1, 8)
-                             if jj <= hh % 6 + 1]) AS j
-                     FROM h)),
-       ud AS MATERIALIZED (SELECT DISTINCT least(a, b) AS u,
-                      greatest(a, b) AS v
-              FROM e0 WHERE a <> b),
-       n0 AS MATERIALIZED (SELECT DISTINCT x AS node FROM
-                (SELECT u AS x FROM ud UNION ALL SELECT v FROM ud))"""]
-    for t in range(1, 9):
-        prev = f"n{t-1}"
-        ctes.append(f"""d{t} AS MATERIALIZED (SELECT x AS node,
-                      count(*) AS d FROM
-                 (SELECT e.u AS x FROM ud e
-                   JOIN {prev} p1 ON p1.node = e.u
-                   JOIN {prev} p2 ON p2.node = e.v
-                  UNION ALL
-                  SELECT e.v FROM ud e
-                   JOIN {prev} p1 ON p1.node = e.u
-                   JOIN {prev} p2 ON p2.node = e.v)
-               GROUP BY x)""")
-        ctes.append(f"""n{t} AS MATERIALIZED (SELECT node FROM d{t}
-                      WHERE d >= 4)""")
-    ctes.append("""chk AS (SELECT CASE WHEN
-                 (SELECT count(*) FROM n8) <> (SELECT count(*) FROM n7)
-               THEN error('q276 peeling did not converge in 8 rounds')
-               ELSE 1 END AS ok)""")
-    return ("WITH " + ",\n       ".join(ctes) + """
-       SELECT n.node,
-              CAST(CASE WHEN k.node IS NULL THEN 0 ELSE 1 END AS BIGINT)
-                  AS in_core
-       FROM n0 n LEFT JOIN n8 k ON k.node = n.node, chk""")
-
-
-@query("q276_kcore", _kcore_oracle_sql())
-def q276(spark, sf_dir):
-    """k-CORE decomposition (k=4) by ROUND-SYNCHRONOUS peeling — the
-    deterministic distributed analogue of the sequential min-degree
-    peel (same fixpoint: the maximal subgraph where every node keeps
-    degree >= k): each round recomputes degrees within the surviving
-    set and drops every under-k node simultaneously; converges in
-    O(peel depth) rounds, each one edge equi-join + one count.  The
-    engine loops to an exact fixpoint with a loud 32-round cap; the
-    oracle unrolls 8 rounds and error()s if the fixture needed more.
-    Core membership is the classic crawl-frontier 'well-linked
-    nucleus' feature."""
-    h = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id % 60 AS hh").distinct()
-    e0 = h.selectExpr(
-        "hh",
-        "explode(sequence(1, CAST(hh % 6 AS INT) + 1)) AS j",
-    ).selectExpr("hh AS a", "(hh * j + j * j) % 60 AS b")
-    ud = (
-        e0.filter("a <> b")
-        .selectExpr("least(a, b) AS u", "greatest(a, b) AS v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        ud.selectExpr("u AS node").unionAll(ud.selectExpr("v AS node"))
-        .distinct().localCheckpoint(eager=True)
-    )
-    alive = nodes
-    n_alive = alive.count()
-    for _round in range(32):
-        a1 = alive.selectExpr("node AS u")
-        a2 = alive.selectExpr("node AS v")
-        live_e = ud.join(a1, "u").join(a2, "v")
-        d = (
-            live_e.selectExpr("u AS node")
-            .unionAll(live_e.selectExpr("v AS node"))
-            .groupBy("node").agg(F.count("*").alias("d"))
-        )
-        nxt = d.filter("d >= 4").select("node").localCheckpoint(eager=True)
-        n_nxt = nxt.count()
-        if n_nxt == n_alive:
-            break
-        alive.unpersist()
-        alive, n_alive = nxt, n_nxt
-    else:
-        raise RuntimeError("q276 k-core peeling did not converge")
-    return nodes.join(
-        alive.withColumn("_k", F.lit(1)), "node", "left"
-    ).select(
-        "node",
-        F.when(F.col("_k").isNull(), 0).otherwise(1).cast("long")
-        .alias("in_core"),
-    )
-
-
-# --- 2-hop neighborhood reach (q277) -----------------------------------------------
-
-
-@query(
-    "q277_two_hop_reach",
-    """WITH e0 AS (SELECT doc_id % 40 AS src,
-                      (doc_id * 7 + doc_id // 40) % 40 AS dst
-               FROM documents),
-       e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-       two AS (SELECT DISTINCT a.src, b.dst AS hop2
-               FROM e a JOIN e b ON b.src = a.dst
-               WHERE b.dst <> a.src),
-       d1 AS (SELECT src, count(*) AS reach1 FROM e GROUP BY src),
-       d2 AS (SELECT src, count(*) AS reach2_raw FROM two GROUP BY src),
-       nw AS (SELECT t.src, count(*) AS new2
-              FROM two t LEFT JOIN e x
-                ON x.src = t.src AND x.dst = t.hop2
-              WHERE x.dst IS NULL
-              GROUP BY t.src)
-       SELECT d1.src AS host,
-              CAST(d1.reach1 AS BIGINT) AS reach1,
-              CAST(coalesce(d2.reach2_raw, 0) AS BIGINT) AS reach2_closed,
-              CAST(coalesce(nw.new2, 0) AS BIGINT) AS reach2_new
-       FROM d1
-       LEFT JOIN d2 ON d2.src = d1.src
-       LEFT JOIN nw ON nw.src = d1.src""",
-)
-def q277(spark, sf_dir):
-    """2-hop neighborhood reach over the directed host graph (the
-    crawl-expansion feature: how many NEW hosts a frontier reaches at
-    depth 2): distinct 1-hop out-neighbors, distinct 2-hop closures
-    (excluding returning to self), and the 2-hop targets NOT already
-    reachable in one hop (anti-join).  One edge self-join + one
-    anti-join, all keyed on host — at web scale the 2-hop closure is
-    computed per frontier shard, never materialized globally."""
-    e = (
-        _t(spark, sf_dir, "documents")
-        .selectExpr("doc_id % 40 AS src",
-                    "(doc_id * 7 + doc_id div 40) % 40 AS dst")
-        .filter("src <> dst").distinct()
-        .localCheckpoint(eager=True)
-    )
-    b = e.selectExpr("src AS mid", "dst AS hop2")
-    two = (
-        e.join(b, e.dst == b.mid)
-        .filter(F.col("hop2") != F.col("src"))
-        .select("src", "hop2").distinct()
-    )
-    d1 = e.groupBy("src").agg(F.count("*").alias("reach1"))
-    d2 = two.groupBy("src").agg(F.count("*").alias("reach2_raw"))
-    nw = (
-        two.join(e.selectExpr("src", "dst AS hop2"), ["src", "hop2"],
-                 "left_anti")
-        .groupBy("src").agg(F.count("*").alias("new2"))
-    )
-    return (
-        d1.withColumnRenamed("src", "host")
-        .join(d2.withColumnRenamed("src", "host"), "host", "left")
-        .join(nw.withColumnRenamed("src", "host"), "host", "left")
-        .select(
-            "host",
-            F.col("reach1").cast("long").alias("reach1"),
-            F.coalesce("reach2_raw", F.lit(0)).cast("long")
-            .alias("reach2_closed"),
-            F.coalesce("new2", F.lit(0)).cast("long").alias("reach2_new"),
-        )
-    )
-
-
-# --- count-min sketch term-frequency estimation (q278) ------------------------
-
-
-@query(
-    "q278_countmin_sketch",
-    """WITH w AS (SELECT unnest(string_split(text, ' ')) AS word
-                  FROM documents),
-       tc AS (SELECT word, count(*) AS cnt FROM w GROUP BY word),
-       cells AS (SELECT r.range AS r,
-                        CAST(CAST('0x' || substr(md5('cm' ||
-                               CAST(r.range AS VARCHAR) || ':' || word),
-                             1, 8) AS UBIGINT) % 64 AS BIGINT) AS c,
-                        word, cnt
-                 FROM tc, range(0, 4) r),
-       sk AS (SELECT r, c, sum(cnt) AS cell FROM cells GROUP BY r, c),
-       est AS (SELECT cells.word, min(sk.cell) AS cms_est
-               FROM cells JOIN sk USING (r, c) GROUP BY cells.word)
-       SELECT tc.word, CAST(tc.cnt AS BIGINT) AS true_cnt,
-              CAST(est.cms_est AS BIGINT) AS cms_est,
-              CAST(est.cms_est - tc.cnt AS BIGINT) AS overcount
-       FROM tc JOIN est USING (word)""",
-)
-def q278(spark, sf_dir):
-    """Count-Min sketch (d=4 rows x w=64 columns) term-frequency
-    estimation — the streaming-scale frequency oracle for web corpora
-    (heavy-hitter detection without a full vocabulary groupBy).  Row
-    hashes are md5-derived integers (the pinned cross-engine idiom:
-    first 8 hex chars via conv/UBIGINT — exact 32-bit value on both
-    engines), the sketch is one (row, col)-keyed BIGINT sum, and each
-    probe takes the MIN over its d cells — est >= truth always, the
-    overcount column shows the collision inflation exactly.  At
-    10^12 tokens the sketch is 256 cells regardless of corpus size:
-    the groupBy is map-side-combinable and the probe side broadcasts."""
-    docs = _t(spark, sf_dir, "documents")
-    words = docs.select(F.explode(F.split("text", " ")).alias("word"))
-    tc = words.groupBy("word").agg(F.count("*").alias("cnt"))
-    cells = tc.select(
-        "word", "cnt", F.explode(F.sequence(F.lit(0), F.lit(3))).alias("r")
-    ).withColumn(
-        "c",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("cm"), F.col("r").cast("string"),
-                            F.lit(":"), F.col("word"),
-                        )
-                    ),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("long")
-            % 64
-        ),
-    )
-    sk = cells.groupBy("r", "c").agg(F.sum("cnt").alias("cell"))
-    est = (
-        cells.select("word", "r", "c")
-        .join(F.broadcast(sk), ["r", "c"])
-        .groupBy("word")
-        .agg(F.min("cell").alias("cms_est"))
-    )
-    return tc.join(est, "word").select(
-        "word",
-        F.col("cnt").cast("long").alias("true_cnt"),
-        F.col("cms_est").cast("long").alias("cms_est"),
-        (F.col("cms_est") - F.col("cnt")).cast("long").alias("overcount"),
-    )
-
-
-# --- HyperLogLog distinct-URL cardinality sketch (q279) -----------------------
+# --- HyperLogLog distinct-URL cardinality sketch, batch SQL (oracle of q311) --
 
 # alpha_32 * m^2 * 2^28 computed once in Python and inlined VERBATIM in
 # both engines (CLAUDE.md: inline Python-computed constants)
 _HLL_C = 191589901139.968  # 0.697 * 32 * 32 * 2**28
-
-
-@query(
-    "q279_hll_cardinality",
-    """WITH u AS (SELECT DISTINCT doc_id % 25 AS host,
+_HLL_ORACLE = """WITH u AS (SELECT DISTINCT doc_id % 25 AS host,
                     'https://h' || CAST(doc_id % 25 AS VARCHAR) ||
                     '.example.com/p' || CAST((doc_id * 13) % 40 AS VARCHAR)
                     AS url
@@ -14473,2631 +9544,13 @@ _HLL_C = 191589901139.968  # 0.697 * 32 * 32 * 2**28
               CAST(agg.sum_reg AS BIGINT) AS sum_reg,
               CAST(agg.harmonic_d AS BIGINT) AS harmonic_d,
               191589901139.968 / CAST(agg.harmonic_d AS DOUBLE) AS hll_est
-       FROM agg JOIN truth USING (host)""",
-)
-def q279(spark, sf_dir):
-    """HyperLogLog per-host distinct-URL cardinality sketch (p=5,
-    m=32 registers) — the mergeable distinct counter every crawl
-    frontier and index-stats job uses at 10^12-URL scale.  The 32-bit
-    md5-derived hash splits into bucket (low 5 bits) and the
-    remaining 27-bit word whose leading-zero rank is the exact
-    integer 28 - floor(log2(w)) - via the bin()-length idiom shared
-    by both engines (no transcendental).  Registers are a per-(host,
-    bucket) MAX — map-side combinable, mergeable across shards, which
-    is the whole point of the sketch.  The harmonic denominator is
-    the EXACT integer sum of 2^(28-reg) (bit-shift, never float pow);
-    the only float op is the final single division by the inlined
-    alpha*m^2*2^28 constant, bitwise on both engines.  The exact
-    distinct count rides along so the estimate error is visible."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        (F.col("doc_id") % 25).alias("host"),
-        F.concat(
-            F.lit("https://h"), (F.col("doc_id") % 25).cast("string"),
-            F.lit(".example.com/p"),
-            ((F.col("doc_id") * 13) % 40).cast("string"),
-        ).alias("url"),
-    ).distinct()
-    h = u.withColumn(
-        "h32",
-        F.conv(F.substring(F.md5("url"), 1, 8), 16, 10).cast("long"),
-    )
-    rho = h.select(
-        "host",
-        (F.col("h32") % 32).alias("b"),
-        F.when(F.expr("h32 div 32") == 0, F.lit(28))
-        .otherwise(28 - F.length(F.bin(F.expr("h32 div 32"))))
-        .alias("rho"),
-    )
-    reg = rho.groupBy("host", "b").agg(F.max("rho").alias("reg"))
-    grid = (
-        u.select("host").distinct()
-        .select("host", F.explode(F.sequence(F.lit(0), F.lit(31))).alias("b"))
-    )
-    full_reg = grid.join(reg, ["host", "b"], "left").select(
-        "host", "b", F.coalesce("reg", F.lit(0)).alias("reg")
-    )
-    agg = full_reg.groupBy("host").agg(
-        F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(28 - reg AS INT))"))
-        .alias("harmonic_d"),
-        F.sum(F.when(F.col("reg") > 0, 1).otherwise(0)).alias("used_buckets"),
-        F.sum("reg").alias("sum_reg"),
-    )
-    truth = u.groupBy("host").agg(
-        F.countDistinct("url").alias("n_distinct")
-    )
-    return agg.join(truth, "host").select(
-        "host",
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-        F.col("used_buckets").cast("long").alias("used_buckets"),
-        F.col("sum_reg").cast("long").alias("sum_reg"),
-        F.col("harmonic_d").cast("long").alias("harmonic_d"),
-        (F.lit(_HLL_C) / F.col("harmonic_d").cast("double")).alias("hll_est"),
-    )
-
-
-# --- TrustRank: seed-teleport anti-spam centrality (q280) ---------------------
-
-
-@query(
-    "q280_trustrank",
-    """WITH hosts AS (SELECT DISTINCT doc_id % 40 AS host FROM documents),
-       edges AS (SELECT host AS src, (host + 3) % 40 AS dst FROM hosts
-                 UNION ALL SELECT host, (host * 5 + 2) % 40 FROM hosts
-                 UNION ALL SELECT host, (host * 7 + 13) % 40 FROM hosts),
-       seeds AS (SELECT host FROM hosts WHERE host % 10 = 0),
-       r0 AS (SELECT h.host,
-                     CAST(CASE WHEN h.host % 10 = 0 THEN 1 ELSE 0 END
-                          AS BIGINT) AS r
-              FROM hosts h),
-       r1 AS (SELECT h.host,
-                     CAST(CASE WHEN h.host % 10 = 0 THEN 9 ELSE 0 END
-                          + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r0 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       r2 AS (SELECT h.host,
-                     CAST(CASE WHEN h.host % 10 = 0 THEN 9 * 60 ELSE 0 END
-                          + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r1 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       r3 AS (SELECT h.host,
-                     CAST(CASE WHEN h.host % 10 = 0 THEN 9 * 3600 ELSE 0 END
-                          + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r2 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       r4 AS (SELECT h.host,
-                     CAST(CASE WHEN h.host % 10 = 0 THEN 9 * 216000 ELSE 0 END
-                          + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r3 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host))
-       SELECT r4.host AS host,
-              CAST(CASE WHEN r4.host % 10 = 0 THEN 1 ELSE 0 END AS BIGINT)
-                AS is_seed,
-              r4.r AS trust_scaled,
-              CAST(r4.r AS DOUBLE) / 51840000.0 AS trust
-       FROM r4""",
-)
-def q280(spark, sf_dir):
-    """TrustRank (Gyongyi et al.) — PageRank whose teleport mass goes
-    ONLY to a trusted seed set, the classic link-spam demotion signal
-    for crawl curation.  Same exact-integer scheme as q190 (damping
-    0.85, uniform out-degree 3, scale 60^t so 0.15 -> 9*60^t on seeds
-    and 0.85/3 -> 17/60 on edges): R_{t+1}(v) = [v in S]*9*60^t +
-    17 * sum_{u->v} R_t(u), R_0 = [v in S].  Every value stays BIGINT
-    (growth <= ~170^t, far inside 2^63 at 4 rounds) so the result is
-    order-free across engines; non-seed spam clusters receive trust
-    only through in-links from the trusted region.  Each round is one
-    equi-join + one map-side-combinable sum keyed on host — the same
-    shuffle shape as PageRank, ~10^8 host rows at web scale.  The
-    edge multiset keeps parallel edges (multigraph semantics,
-    UNION ALL on both engines)."""
-    docs = _t(spark, sf_dir, "documents")
-    hosts = docs.select((F.col("doc_id") % 40).alias("host")).distinct()
-    edges = hosts.select(
-        F.col("host").alias("src"),
-        F.explode(F.array(
-            (F.col("host") + 3) % 40,
-            (F.col("host") * 5 + 2) % 40,
-            (F.col("host") * 7 + 13) % 40,
-        )).alias("dst"),
-    )
-    seed = F.when(F.col("host") % 10 == 0, 1).otherwise(0)
-    ranks = hosts.withColumn("r", seed.cast("long"))
-    for t in range(4):
-        tele = 9 * (60 ** t)
-        contrib = (
-            edges.join(ranks, edges.src == ranks.host)
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * 17).alias("s"))
-        )
-        ranks = (
-            hosts.join(contrib, hosts.host == contrib.dst, "left")
-            .select(
-                hosts.host,
-                (
-                    F.when(hosts.host % 10 == 0, F.lit(tele)).otherwise(0)
-                    + F.coalesce(F.col("s"), F.lit(0))
-                ).cast("long").alias("r"),
-            )
-        )
-    return ranks.select(
-        "host",
-        F.when(F.col("host") % 10 == 0, 1).otherwise(0).cast("long")
-        .alias("is_seed"),
-        F.col("r").alias("trust_scaled"),
-        (F.col("r").cast("double") / F.lit(51840000.0)).alias("trust"),
-    )
-
-
-# --- anchor-text consolidation per target host (q281) -------------------------
-
-
-@query(
-    "q281_anchor_text",
-    """WITH links AS (SELECT doc_id % 40 AS src,
-                             (doc_id * 7 + 3) % 40 AS dst,
-                             string_split(text, ' ')[(doc_id % 10) + 1]
-                               AS anchor
-                      FROM documents),
-       a AS (SELECT dst, anchor, count(*) AS cnt FROM links
-             GROUP BY dst, anchor),
-       m AS (SELECT dst, max(cnt) AS mc, sum(cnt) AS inlinks,
-                    count(*) AS n_terms
-             FROM a GROUP BY dst),
-       top AS (SELECT a.dst, max(a.anchor) AS top_anchor
-               FROM a JOIN m ON a.dst = m.dst AND a.cnt = m.mc
-               GROUP BY a.dst)
-       SELECT m.dst AS host,
-              CAST(m.inlinks AS BIGINT) AS inlinks,
-              CAST(m.n_terms AS BIGINT) AS n_anchor_terms,
-              top.top_anchor AS top_anchor,
-              CAST(m.mc AS BIGINT) AS top_cnt
-       FROM m JOIN top ON top.dst = m.dst""",
-)
-def q281(spark, sf_dir):
-    """Anchor-text consolidation — the indexing-side aggregation that
-    attaches the web's description of a page TO the page (anchor
-    terms of in-links, the classic ranking signal): per target host,
-    in-link count, distinct anchor-term count, and the dominant
-    anchor term by a map-side-combinable struct argmax (max count,
-    ties to lexicographically-greatest term — binary string order,
-    identical on both engines for the ascii vocabulary).  The anchor
-    is a deterministic word of the linking document (1-indexed
-    element (doc_id%10)+1; every fixture doc has >= 10 words).  One
-    groupBy keyed on (dst, anchor) then one argmax keyed on dst —
-    never a window over the term table; at web scale both shuffles
-    key on the target host."""
-    docs = _t(spark, sf_dir, "documents")
-    links = docs.select(
-        (F.col("doc_id") % 40).alias("src"),
-        ((F.col("doc_id") * 7 + 3) % 40).alias("dst"),
-        F.element_at(
-            F.split("text", " "), ((F.col("doc_id") % 10) + 1).cast("int")
-        ).alias("anchor"),
-    )
-    a = links.groupBy("dst", "anchor").agg(F.count("*").alias("cnt"))
-    m = a.groupBy("dst").agg(
-        F.max(F.struct(F.col("cnt"), F.col("anchor"))).alias("top"),
-        F.sum("cnt").alias("inlinks"),
-        F.count("*").alias("n_terms"),
-    )
-    return m.select(
-        F.col("dst").alias("host"),
-        F.col("inlinks").cast("long").alias("inlinks"),
-        F.col("n_terms").cast("long").alias("n_anchor_terms"),
-        F.col("top.anchor").alias("top_anchor"),
-        F.col("top.cnt").cast("long").alias("top_cnt"),
-    )
-
-
-# --- Bloom-filter blocklist membership accounting (q282) ----------------------
-
-
-@query(
-    "q282_bloom_blocklist",
-    """WITH u AS (SELECT doc_id,
-                    'https://site' || CAST(doc_id % 50 AS VARCHAR) ||
-                    '.org/page' || CAST(doc_id % 23 AS VARCHAR) AS url,
-                    doc_id % 50 AS site
-                  FROM documents),
-       bl AS (SELECT DISTINCT url FROM u WHERE doc_id % 17 = 0),
-       pos AS (SELECT DISTINCT
-                 CAST(CAST('0x' || substr(md5('bf' ||
-                        CAST(k.range AS VARCHAR) || ':' || url), 1, 8)
-                      AS UBIGINT) % 256 AS BIGINT) AS p
-               FROM bl, range(0, 3) k),
-       probe AS (SELECT u.url, u.site, k.range AS k,
-                   CAST(CAST('0x' || substr(md5('bf' ||
-                          CAST(k.range AS VARCHAR) || ':' || u.url), 1, 8)
-                        AS UBIGINT) % 256 AS BIGINT) AS p
-                 FROM (SELECT DISTINCT url, site FROM u) u, range(0, 3) k),
-       hits AS (SELECT url, site, count(*) AS nhit
-                FROM probe JOIN pos USING (p)
-                GROUP BY url, site),
-       verdict AS (SELECT p.url, p.site,
-                          CASE WHEN coalesce(h.nhit, 0) = 3 THEN 1 ELSE 0 END
-                            AS bloom_hit,
-                          CASE WHEN bl.url IS NOT NULL THEN 1 ELSE 0 END
-                            AS truly_blocked
-                   FROM (SELECT DISTINCT url, site FROM u) p
-                   LEFT JOIN (SELECT url, max(nhit) AS nhit FROM hits
-                              GROUP BY url) h ON h.url = p.url
-                   LEFT JOIN bl ON bl.url = p.url)
-       SELECT site,
-              CAST(count(*) AS BIGINT) AS n_urls,
-              CAST(sum(bloom_hit) AS BIGINT) AS n_bloom_hits,
-              CAST(sum(truly_blocked) AS BIGINT) AS n_blocked,
-              CAST(sum(bloom_hit) - sum(truly_blocked) AS BIGINT)
-                AS n_false_pos
-       FROM verdict GROUP BY site""",
-)
-def q282(spark, sf_dir):
-    """Bloom-filter blocklist gate with exact false-positive
-    accounting — the crawl-ingest membership test (is this URL on the
-    blocklist?) at the scale where the blocklist itself must be a
-    bit-set, not a join side.  k=3 md5-derived hash positions into
-    m=256 bits (the pinned conv/UBIGINT idiom); the filter is the
-    DISTINCT position set of the blocklist, a candidate hits when ALL
-    3 of its positions are present (count==3 over a position
-    semi-join).  Bloom guarantees no false negatives — n_bloom_hits
-    >= n_blocked per site by construction, and the n_false_pos column
-    measures the collision rate of this (m, k, n) point exactly.  At
-    10^12 URLs the filter broadcast is 256 bits and the probe is a
-    map-side broadcast join; nothing shuffles on the URL."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("https://site"), (F.col("doc_id") % 50).cast("string"),
-            F.lit(".org/page"), (F.col("doc_id") % 23).cast("string"),
-        ).alias("url"),
-        (F.col("doc_id") % 50).alias("site"),
-    )
-    bl = u.filter(F.col("doc_id") % 17 == 0).select("url").distinct()
-
-    def _pos(url_col, k_col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("bf"), k_col.cast("string"),
-                                   F.lit(":"), url_col)),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("long")
-            % 256
-        )
-
-    ks = F.explode(F.sequence(F.lit(0), F.lit(2))).alias("k")
-    pos = (
-        bl.select("url", ks)
-        .select(_pos(F.col("url"), F.col("k")).alias("p"))
-        .distinct()
-    )
-    cand = u.select("url", "site").distinct()
-    probe = cand.select("url", "site", ks).withColumn(
-        "p", _pos(F.col("url"), F.col("k"))
-    )
-    hits = (
-        probe.join(F.broadcast(pos), "p")
-        .groupBy("url", "site")
-        .agg(F.count("*").alias("nhit"))
-    )
-    verdict = (
-        cand.join(
-            hits.groupBy("url").agg(F.max("nhit").alias("nhit")),
-            "url", "left",
-        )
-        .join(
-            F.broadcast(bl.withColumn("_b", F.lit(1))), "url", "left"
-        )
-        .select(
-            "site",
-            F.when(F.coalesce("nhit", F.lit(0)) == 3, 1).otherwise(0)
-            .alias("bloom_hit"),
-            F.when(F.col("_b").isNotNull(), 1).otherwise(0)
-            .alias("truly_blocked"),
-        )
-    )
-    return verdict.groupBy("site").agg(
-        F.count("*").cast("long").alias("n_urls"),
-        F.sum("bloom_hit").cast("long").alias("n_bloom_hits"),
-        F.sum("truly_blocked").cast("long").alias("n_blocked"),
-        (F.sum("bloom_hit") - F.sum("truly_blocked")).cast("long")
-        .alias("n_false_pos"),
-    )
-
-
-# --- shingle-containment near-dup (q283) --------------------------------------
-
-
-@query(
-    "q283_shingle_containment",
-    """WITH d AS (SELECT doc_id,
-                    CASE WHEN doc_id % 20 = 0 THEN
-                      'alpha beta gamma delta epsilon zeta eta theta iota kappa tail'
-                      || CAST(doc_id % 3 AS VARCHAR)
-                    ELSE text END AS body
-                  FROM documents),
-       s AS (SELECT doc_id, string_split(body, ' ') AS w FROM d),
-       g AS (SELECT DISTINCT doc_id,
-                    w[r.range] || ' ' || w[r.range + 1] AS gram
-             FROM s, range(1, 200) r
-             WHERE r.range <= len(w) - 1),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q283 oracle range(1,200) bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       df AS (SELECT gram, count(*) AS dfc FROM g GROUP BY gram),
-       surv AS (SELECT g.doc_id, g.gram FROM g JOIN df USING (gram)
-                WHERE df.dfc <= 60),
-       sz AS (SELECT doc_id, count(*) AS size_a FROM surv GROUP BY doc_id),
-       pairs AS (SELECT a.doc_id AS a, b.doc_id AS b,
-                        count(*) AS inter
-                 FROM surv a JOIN surv b
-                   ON a.gram = b.gram AND a.doc_id <> b.doc_id
-                 GROUP BY a.doc_id, b.doc_id)
-       SELECT p.a, p.b,
-              CAST(p.inter AS BIGINT) AS inter,
-              CAST(sz.size_a AS BIGINT) AS size_a
-       FROM pairs p JOIN sz ON sz.doc_id = p.a, chk
-       WHERE 2 * p.inter >= sz.size_a""",
-)
-def q283(spark, sf_dir):
-    """Shingle-CONTAINMENT near-dup detection (Broder's asymmetric
-    measure |S_A inter S_B| / |S_A| — catches a short page swallowed
-    by a longer one, which symmetric Jaccard misses).  Universe =
-    word bigrams with document frequency <= 60, an ABSOLUTE df cap
-    (the q19 lesson: proportional caps still admit N^2 pairs at
-    10^12 docs) — candidate volume is sum(df^2) over surviving grams,
-    so hot boilerplate shingles can never explode the self-join; at
-    larger SFs the cap REMOVES the injected template (df grows with
-    corpus) and the plan gets cheaper, which is the linearity story
-    working as intended.  Docs with doc_id%20==0 carry a shared
-    10-word template + a 3-way tail so the fixture has true
-    containment pairs at sf<=0.01; threshold 2*inter >= size_a
-    (containment >= 1/2) in exact integer cross-multiplication."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 20 == 0,
-            F.concat(
-                F.lit("alpha beta gamma delta epsilon zeta eta theta "
-                      "iota kappa tail"),
-                (F.col("doc_id") % 3).cast("string"),
-            ),
-        ).otherwise(F.col("text")).alias("body"),
-    )
-    w = d.select("doc_id", F.split("body", " ").alias("w"))
-    g = (
-        w.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(w) - 1), "
-                    "i -> concat(w[i - 1], ' ', w[i]))"
-                )
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-    dfc = g.groupBy("gram").agg(F.count("*").alias("dfc"))
-    surv = g.join(dfc.filter(F.col("dfc") <= 60), "gram").select(
-        "doc_id", "gram"
-    )
-    sz = surv.groupBy("doc_id").agg(F.count("*").alias("size_a"))
-    b = surv.select(F.col("doc_id").alias("b"), "gram")
-    pairs = (
-        surv.join(b, "gram")
-        .filter(F.col("doc_id") != F.col("b"))
-        .groupBy(F.col("doc_id").alias("a"), "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        pairs.join(sz.withColumnRenamed("doc_id", "a"), "a")
-        .filter(2 * F.col("inter") >= F.col("size_a"))
-        .select(
-            "a", "b",
-            F.col("inter").cast("long").alias("inter"),
-            F.col("size_a").cast("long").alias("size_a"),
-        )
-    )
-
-
-# --- corpus-drift chi-square per (source, term) (q284) ------------------------
-
-
-@query(
-    "q284_chisq_drift",
-    """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS word
-                  FROM documents),
-       o AS (SELECT source, word, count(*) AS obs FROM w
-             GROUP BY source, word),
-       r AS (SELECT source, count(*) AS rt FROM w GROUP BY source),
-       c AS (SELECT word, count(*) AS ct FROM w GROUP BY word),
-       t AS (SELECT count(*) AS tt FROM w),
-       grid AS (SELECT r.source, c.word, r.rt, c.ct FROM r, c),
-       cell AS (SELECT grid.source, grid.word, grid.rt, grid.ct,
-                       coalesce(o.obs, 0) AS obs
-                FROM grid LEFT JOIN o
-                  ON o.source = grid.source AND o.word = grid.word)
-       SELECT cell.source, cell.word,
-              CAST(cell.obs AS BIGINT) AS obs,
-              CAST(cell.rt * cell.ct AS BIGINT) AS e_num,
-              CAST(cell.obs * t.tt - cell.rt * cell.ct AS DOUBLE)
-                * CAST(cell.obs * t.tt - cell.rt * cell.ct AS DOUBLE)
-                / CAST(cell.rt AS DOUBLE) / CAST(cell.ct AS DOUBLE)
-                / CAST(t.tt AS DOUBLE) AS chi2_term
-       FROM cell, t""",
-)
-def q284(spark, sf_dir):
-    """Per-(source, term) chi-square drift contribution — the corpus
-    QA pass that localizes which slice of a web crawl shifted its
-    token distribution (domain drift / contamination detection before
-    training).  The statistic's cell term ((O - E)^2 / E with
-    E = R*C/T) is algebraically lifted to (O*T - R*C)^2 / (R*C*T) so
-    the numerator difference is computed in EXACT BIGINT arithmetic
-    (O*T <= ~2.5e11 even at sf1), then squared and divided in a fixed
-    left-to-right double expression — identical IEEE tree on both
-    engines, no rounding needed.  Full source x vocabulary grid
-    (absent cells count 0, contributing exactly R*C/T).  Four
-    map-side-combinable count aggregations + one broadcast-size
-    grid join; at web scale everything keys on (source, word) and the
-    vocabulary side is the small one."""
-    docs = _t(spark, sf_dir, "documents")
-    w = docs.select("source", F.explode(F.split("text", " ")).alias("word"))
-    o = w.groupBy("source", "word").agg(F.count("*").alias("obs"))
-    r = w.groupBy("source").agg(F.count("*").alias("rt"))
-    c = w.groupBy("word").agg(F.count("*").alias("ct"))
-    t = w.agg(F.count("*").alias("tt"))
-    grid = r.crossJoin(F.broadcast(c))
-    cell = grid.join(o, ["source", "word"], "left").select(
-        "source", "word", "rt", "ct",
-        F.coalesce("obs", F.lit(0)).alias("obs"),
-    )
-    d = (F.col("obs") * F.col("tt") - F.col("rt") * F.col("ct")).cast(
-        "double"
-    )
-    return cell.crossJoin(F.broadcast(t)).select(
-        "source", "word",
-        F.col("obs").cast("long").alias("obs"),
-        (F.col("rt") * F.col("ct")).cast("long").alias("e_num"),
-        (
-            d * d
-            / F.col("rt").cast("double")
-            / F.col("ct").cast("double")
-            / F.col("tt").cast("double")
-        ).alias("chi2_term"),
-    )
-
-
-# --- VByte postings-size accounting (q285) ------------------------------------
-
-
-@query(
-    "q285_vbyte_postings",
-    """WITH p AS (SELECT DISTINCT word, doc_id FROM
-                    (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                     FROM documents)),
-       gaps AS (SELECT word,
-                       coalesce(doc_id - lag(doc_id) OVER
-                                  (PARTITION BY word ORDER BY doc_id),
-                                doc_id + 1) AS gap
-                FROM p),
-       b AS (SELECT word,
-                    ((length(bin(gap)) - 1) // 7) + 1 AS nbytes
-             FROM gaps)
-       SELECT word,
-              CAST(count(*) AS BIGINT) AS df,
-              CAST(sum(nbytes) AS BIGINT) AS vbyte_bytes,
-              CAST(count(*) * 8 - sum(nbytes) AS BIGINT) AS saved_vs_fixed64
-       FROM b GROUP BY word""",
-)
-def q285(spark, sf_dir):
-    """Variable-byte (VByte) postings-size accounting — the
-    capacity-planning pass for the index tier, complementing q269's
-    Elias-gamma bits: per term, sort the posting list, delta-encode
-    (first entry charged as doc_id+1 so the gap is always >= 1), and
-    charge each gap its exact VByte cost ceil(bits/7) =
-    (floor(log2 g) // 7) + 1 via the cross-engine bin()-length idiom
-    — pure integers, no float log anywhere.  The lag window is
-    TERM-SHARDED (partitioned by word), the q269 contract: at
-    10^12 postings each term's list sorts independently, there is no
-    global window.  saved_vs_fixed64 quantifies the win over 8-byte
-    raw ids."""
-    docs = _t(spark, sf_dir, "documents")
-    p = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .distinct()
-    )
-    win = Window.partitionBy("word").orderBy("doc_id")
-    gaps = p.select(
-        "word",
-        F.coalesce(
-            F.col("doc_id") - F.lag("doc_id").over(win),
-            F.col("doc_id") + 1,
-        ).alias("gap"),
-    )
-    b = gaps.select(
-        "word",
-        (F.expr("(length(bin(gap)) - 1) div 7") + 1).alias("nbytes"),
-    )
-    return b.groupBy("word").agg(
-        F.count("*").cast("long").alias("df"),
-        F.sum("nbytes").cast("long").alias("vbyte_bytes"),
-        (F.count("*") * 8 - F.sum("nbytes")).cast("long")
-        .alias("saved_vs_fixed64"),
-    )
-
-
-# --- SALSA authority scores, closed form (q286) -------------------------------
-
-
-@query(
-    "q286_salsa_authority",
-    """WITH RECURSIVE e AS (SELECT DISTINCT doc_id % 40 AS src,
-                                   (doc_id * 11 + 5) % 40 AS dst
-                            FROM documents),
-       auth AS (SELECT DISTINCT dst FROM e),
-       indeg AS (SELECT dst, count(*) AS indeg FROM e GROUP BY dst),
-       cocite AS (SELECT DISTINCT a.dst AS x, b.dst AS y
-                  FROM e a JOIN e b ON a.src = b.src
-                  WHERE a.dst <> b.dst),
-       lab AS (SELECT dst AS node, dst AS lbl FROM auth
-               UNION
-               SELECT c.y, l.lbl
-               FROM lab l JOIN cocite c ON c.x = l.node),
-       comp AS (SELECT node, min(lbl) AS comp FROM lab GROUP BY node),
-       den AS (SELECT comp.comp, sum(indeg.indeg) AS comp_indeg
-               FROM comp JOIN indeg ON indeg.dst = comp.node
-               GROUP BY comp.comp)
-       SELECT i.dst AS authority,
-              CAST(i.indeg AS BIGINT) AS indeg,
-              CAST(c.comp AS BIGINT) AS comp,
-              CAST(d.comp_indeg AS BIGINT) AS comp_indeg,
-              CAST(i.indeg AS DOUBLE) / CAST(d.comp_indeg AS DOUBLE)
-                AS salsa
-       FROM indeg i JOIN comp c ON c.node = i.dst
-       JOIN den d ON d.comp = c.comp""",
-)
-def q286(spark, sf_dir):
-    """SALSA authority scores (Lempel-Moran 2000) via the CLOSED FORM:
-    the authority-side random walk's stationary distribution is
-    in-degree normalized WITHIN each connected component of the
-    co-citation graph (authorities joined when they share a hub) —
-    no power iteration at all, which is why SALSA is the cheap
-    link-spam-resistant alternative to HITS at crawl scale.  The
-    engine computes components by round-synchronous min-label
-    propagation over the co-citation edges (loop to an exact
-    fixpoint, loud 16-round cap; the label sum is a monotone integer
-    so it doubles as the convergence signal); the oracle closes the
-    same labels with a recursive CTE.  Scores are the exact rational
-    indeg/comp_indeg emitted as one division — bitwise on both
-    engines.  At web scale the co-citation join is hub-sharded and
-    the component pass is the standard pointer-jumping CC."""
-    docs = _t(spark, sf_dir, "documents")
-    e = (
-        docs.select(
-            (F.col("doc_id") % 40).alias("src"),
-            ((F.col("doc_id") * 11 + 5) % 40).alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    indeg = e.groupBy("dst").agg(F.count("*").alias("indeg"))
-    cocite = (
-        e.select("src", F.col("dst").alias("x"))
-        .join(e.select("src", F.col("dst").alias("y")), "src")
-        .filter(F.col("x") != F.col("y"))
-        .select("x", "y")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    comp = indeg.select(
-        F.col("dst").alias("node"), F.col("dst").alias("lbl")
-    ).localCheckpoint(eager=True)
-    prev_sum = comp.agg(F.sum("lbl")).collect()[0][0]
-    for _round in range(16):
-        nb = (
-            cocite.join(
-                comp.select(F.col("node").alias("x"),
-                            F.col("lbl").alias("xl")),
-                "x",
-            )
-            .groupBy(F.col("y").alias("node"))
-            .agg(F.min("xl").alias("nl"))
-        )
-        comp = (
-            comp.join(nb, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nl", F.col("lbl")))
-                .alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        s = comp.agg(F.sum("lbl")).collect()[0][0]
-        if s == prev_sum:
-            break
-        prev_sum = s
-    else:
-        raise RuntimeError("q286 min-label propagation did not converge")
-    den = (
-        comp.join(indeg, comp.node == indeg.dst)
-        .groupBy(F.col("lbl").alias("comp"))
-        .agg(F.sum("indeg").alias("comp_indeg"))
-    )
-    return (
-        indeg.join(comp, indeg.dst == comp.node)
-        .join(den, comp.lbl == den.comp)
-        .select(
-            F.col("dst").alias("authority"),
-            F.col("indeg").cast("long").alias("indeg"),
-            F.col("lbl").cast("long").alias("comp"),
-            F.col("comp_indeg").cast("long").alias("comp_indeg"),
-            (F.col("indeg").cast("double")
-             / F.col("comp_indeg").cast("double")).alias("salsa"),
-        )
-    )
-
-
-# --- conjunctive-query planning stats (q287) ----------------------------------
-
-
-@query(
-    "q287_conjunctive_planning",
-    """WITH p AS (SELECT DISTINCT word, doc_id FROM
-                    (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                     FROM documents)),
-       dft AS (SELECT word, count(*) AS df FROM p GROUP BY word),
-       v AS (SELECT word, df,
-                    row_number() OVER (ORDER BY word) AS rnk
-             FROM dft),
-       q AS (SELECT i.range AS qid,
-                    (i.range % 31) + 1 AS r1,
-                    ((i.range * 7 + 3) % 31) + 1 AS r2
-             FROM range(0, 10) i),
-       qq AS (SELECT q.qid, v1.word AS t1, v1.df AS df1,
-                     v2.word AS t2, v2.df AS df2
-              FROM q JOIN v v1 ON v1.rnk = q.r1
-                     JOIN v v2 ON v2.rnk = q.r2),
-       bq AS (SELECT qq.qid, count(*) AS n_both
-                FROM qq JOIN p p1 ON p1.word = qq.t1
-                        JOIN p p2 ON p2.word = qq.t2
-                               AND p2.doc_id = p1.doc_id
-                GROUP BY qq.qid)
-       SELECT qq.qid, qq.t1, qq.t2,
-              CAST(qq.df1 AS BIGINT) AS df1,
-              CAST(qq.df2 AS BIGINT) AS df2,
-              CAST(coalesce(bq.n_both, 0) AS BIGINT) AS n_both,
-              CASE WHEN qq.df1 < qq.df2
-                     OR (qq.df1 = qq.df2 AND qq.t1 < qq.t2)
-                   THEN qq.t1 ELSE qq.t2 END AS planned_first
-       FROM qq LEFT JOIN bq USING (qid)""",
-)
-def q287(spark, sf_dir):
-    """Conjunctive (AND) query planning statistics — the
-    rarest-term-first decision every posting-list intersection makes:
-    for a deterministic 10-query workload over the lexicon (term
-    ranks (i%31)+1 and ((i*7+3)%31)+1, never equal on this range),
-    emit both document frequencies, the exact intersection size, and
-    the planned driving term = smaller (df, word) — the term whose
-    postings the intersection scans first.  The df table is
-    vocabulary-sized and broadcast; the intersection is a
-    doc-keyed equi-join of two posting selections, never a full
-    posting cross.  The lexicon ranking window runs over the BOUNDED
-    vocabulary (31 rows), not the postings."""
-    docs = _t(spark, sf_dir, "documents")
-    p = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dft = p.groupBy("word").agg(F.count("*").alias("df"))
-    v = dft.select(
-        "word", "df",
-        F.row_number().over(Window.orderBy("word")).alias("rnk"),
-    )
-    q = spark.range(0, 10).select(
-        F.col("id").alias("qid"),
-        ((F.col("id") % 31) + 1).alias("r1"),
-        (((F.col("id") * 7 + 3) % 31) + 1).alias("r2"),
-    )
-    v1 = v.select(F.col("rnk").alias("r1"), F.col("word").alias("t1"),
-                  F.col("df").alias("df1"))
-    v2 = v.select(F.col("rnk").alias("r2"), F.col("word").alias("t2"),
-                  F.col("df").alias("df2"))
-    qq = q.join(F.broadcast(v1), "r1").join(F.broadcast(v2), "r2")
-    both = (
-        qq.select("qid", "t1", "t2")
-        .join(p.withColumnRenamed("word", "t1"), "t1")
-        .join(p.withColumnRenamed("word", "t2"), ["t2", "doc_id"])
-        .groupBy("qid")
-        .agg(F.count("*").alias("n_both"))
-    )
-    return (
-        qq.join(both, "qid", "left")
-        .select(
-            "qid", "t1", "t2",
-            F.col("df1").cast("long").alias("df1"),
-            F.col("df2").cast("long").alias("df2"),
-            F.coalesce("n_both", F.lit(0)).cast("long").alias("n_both"),
-            F.when(
-                (F.col("df1") < F.col("df2"))
-                | ((F.col("df1") == F.col("df2"))
-                   & (F.col("t1") < F.col("t2"))),
-                F.col("t1"),
-            ).otherwise(F.col("t2")).alias("planned_first"),
-        )
-    )
-
-
-# --- URL structural features for crawl prioritization (q288) ------------------
-
-
-@query(
-    "q288_url_features",
-    """WITH u AS (SELECT doc_id,
-                    'https://' ||
-                    CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END ||
-                    'site' || CAST(doc_id % 30 AS VARCHAR) || '.example.' ||
-                    CASE doc_id % 4 WHEN 0 THEN 'com' WHEN 1 THEN 'org'
-                                    WHEN 2 THEN 'net' ELSE 'io' END ||
-                    '/' || repeat('d/', CAST(doc_id % 5 AS INT)) ||
-                    'p' || CAST(doc_id AS VARCHAR) ||
-                    CASE WHEN doc_id % 3 = 0 THEN '?a=1&b=2' ELSE '' END ||
-                    CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END
-                    AS url
-                  FROM documents),
-       f AS (SELECT doc_id, url,
-                    regexp_extract(url, 'https://([^/]+)', 1) AS host,
-                    regexp_extract(url, 'https://[^/]+(/[^?#]*)', 1)
-                      AS path,
-                    regexp_extract(url, '\\?([^#]*)', 1) AS qs
-             FROM u)
-       SELECT doc_id, url,
-              CAST(length(host) AS BIGINT) AS host_len,
-              CAST(CASE WHEN host LIKE 'www.%' THEN 1 ELSE 0 END AS BIGINT)
-                AS is_www,
-              CAST(length(path) - length(replace(path, '/', ''))
-                AS BIGINT) AS path_depth,
-              CAST(CASE WHEN qs = '' THEN 0
-                        ELSE length(qs) - length(replace(qs, '&', '')) + 1
-                   END AS BIGINT) AS n_params,
-              CAST(CASE WHEN url LIKE '%#%' THEN 1 ELSE 0 END AS BIGINT)
-                AS has_fragment
-       FROM f""",
-)
-def q288(spark, sf_dir):
-    """URL structural features — the crawl-prioritization signals
-    (shallow paths and parameterless URLs crawl first; fragments and
-    deep calendar-style paths demote): host length, www prefix, path
-    depth (slash count), query-parameter count, fragment flag.  Pure
-    JVM Column regex/length arithmetic (patterns inside the
-    RE2/Java-regex common subset), zero Python, zero shuffle — a
-    projection that runs at scan speed over 10^12 URLs."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("https://"),
-            F.when(F.col("doc_id") % 2 == 0, F.lit("www.")).otherwise(""),
-            F.lit("site"), (F.col("doc_id") % 30).cast("string"),
-            F.lit(".example."),
-            F.element_at(
-                F.array(F.lit("com"), F.lit("org"), F.lit("net"),
-                        F.lit("io")),
-                (F.col("doc_id") % 4).cast("int") + 1,
-            ),
-            F.lit("/"),
-            F.repeat(F.lit("d/"), (F.col("doc_id") % 5).cast("int")),
-            F.lit("p"), F.col("doc_id").cast("string"),
-            F.when(F.col("doc_id") % 3 == 0, F.lit("?a=1&b=2"))
-            .otherwise(""),
-            F.when(F.col("doc_id") % 7 == 0, F.lit("#frag")).otherwise(""),
-        ).alias("url"),
-    )
-    f = u.select(
-        "doc_id", "url",
-        F.regexp_extract("url", "https://([^/]+)", 1).alias("host"),
-        F.regexp_extract("url", "https://[^/]+(/[^?#]*)", 1).alias("path"),
-        F.regexp_extract("url", "\\?([^#]*)", 1).alias("qs"),
-    )
-    return f.select(
-        "doc_id", "url",
-        F.length("host").cast("long").alias("host_len"),
-        F.when(F.col("host").startswith("www."), 1).otherwise(0)
-        .cast("long").alias("is_www"),
-        (F.length("path")
-         - F.length(F.replace(F.col("path"), F.lit("/"), F.lit(""))))
-        .cast("long").alias("path_depth"),
-        F.when(F.col("qs") == "", 0).otherwise(
-            F.length("qs")
-            - F.length(F.replace(F.col("qs"), F.lit("&"), F.lit(""))) + 1
-        ).cast("long").alias("n_params"),
-        F.when(F.col("url").contains("#"), 1).otherwise(0).cast("long")
-        .alias("has_fragment"),
-    )
-
-
-# --- reciprocal-rank fusion of two retrieval rankings (q289) ------------------
-
-
-@query(
-    "q289_rrf_fusion",
-    """WITH kw AS (SELECT doc_id,
-                     len(list_filter(string_split(text, ' '),
-                         x -> x = 'join')) AS tf
-                   FROM documents),
-       kwr AS (SELECT doc_id,
-                      row_number() OVER (ORDER BY tf DESC, doc_id ASC)
-                        AS rnk
-               FROM kw),
-       qv AS (SELECT list_transform(embedding,
-                  x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                  AS qq
-              FROM embeddings WHERE vec_id = 0),
-       dots AS (SELECT v.vec_id AS doc_id,
-                  CAST(list_sum(list_transform(list_zip(qv.qq,
-                     list_transform(v.embedding,
-                       x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5)
-                            AS BIGINT))),
-                     s -> s[1]*s[2])) AS BIGINT) AS dot
-                FROM embeddings v, qv),
-       emr AS (SELECT doc_id,
-                      row_number() OVER (ORDER BY dot DESC, doc_id ASC)
-                        AS rnk
-               FROM dots),
-       fused AS (SELECT k.doc_id,
-                        CAST(1000000000 // (60 + k.rnk)
-                             + 1000000000 // (60 + e.rnk) AS BIGINT)
-                          AS rrf_scaled,
-                        k.rnk AS kw_rank, e.rnk AS emb_rank
-                 FROM kwr k JOIN emr e USING (doc_id)),
-       top AS (SELECT doc_id, rrf_scaled, kw_rank, emb_rank,
-                      row_number() OVER
-                        (ORDER BY rrf_scaled DESC, doc_id ASC) AS fused_rank
-               FROM fused)
-       SELECT doc_id, CAST(kw_rank AS BIGINT) AS kw_rank,
-              CAST(emb_rank AS BIGINT) AS emb_rank,
-              rrf_scaled, CAST(fused_rank AS BIGINT) AS fused_rank
-       FROM top WHERE fused_rank <= 20""",
-)
-def q289(spark, sf_dir):
-    """Reciprocal-rank fusion (RRF, Cormack et al.) of a keyword
-    ranking (tf of 'join', ties to low doc_id) and an embedding
-    ranking (integer-quantized dot with query vector 0) — the
-    standard hybrid-search merge, in EXACT integers: each ranking
-    contributes floor(10^9/(60+rank)), so the fused score is a
-    BIGINT and cross-engine order-free; final top-20 by (score desc,
-    doc asc).  At fleet scale each ranking's row_number is computed
-    within its shard/query group (here one query = one global
-    window over the fixture; the ranking windows are per-query at
-    scale, the q148/q266 serving pattern)."""
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
-    kw = docs.select(
-        "doc_id",
-        F.size(F.filter(F.split("text", " "),
-                        lambda x: x == "join")).alias("tf"),
-    )
-    kwr = kw.select(
-        "doc_id",
-        F.row_number().over(
-            Window.orderBy(F.col("tf").desc(), F.col("doc_id").asc())
-        ).alias("kw_rank"),
-    )
-    qv = emb.filter("vec_id = 0").selectExpr(
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qq"
-    )
-    dots = emb.crossJoin(F.broadcast(qv)).selectExpr(
-        "vec_id AS doc_id",
-        "CAST(aggregate(zip_with(qq, transform(embedding, "
-        "x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT)), "
-        "(a, b) -> a * b), CAST(0 AS BIGINT), (acc, v) -> acc + v) "
-        "AS BIGINT) AS dot",
-    )
-    emr = dots.select(
-        "doc_id",
-        F.row_number().over(
-            Window.orderBy(F.col("dot").desc(), F.col("doc_id").asc())
-        ).alias("emb_rank"),
-    )
-    fused = kwr.join(emr, "doc_id").select(
-        "doc_id", "kw_rank", "emb_rank",
-        (
-            F.expr("CAST(1000000000 div (60 + kw_rank) AS BIGINT)")
-            + F.expr("CAST(1000000000 div (60 + emb_rank) AS BIGINT)")
-        ).alias("rrf_scaled"),
-    )
-    top = fused.select(
-        "*",
-        F.row_number().over(
-            Window.orderBy(F.col("rrf_scaled").desc(),
-                           F.col("doc_id").asc())
-        ).alias("fused_rank"),
-    ).filter(F.col("fused_rank") <= 20)
-    return top.select(
-        "doc_id",
-        F.col("kw_rank").cast("long").alias("kw_rank"),
-        F.col("emb_rank").cast("long").alias("emb_rank"),
-        F.col("rrf_scaled").cast("long").alias("rrf_scaled"),
-        F.col("fused_rank").cast("long").alias("fused_rank"),
-    )
-
-
-# --- PMI collocation extraction (q290) ----------------------------------------
-
-
-@query(
-    "q290_pmi_collocations",
-    """WITH s AS (SELECT doc_id,
-                    string_split(text ||
-                      CASE WHEN doc_id % 6 = 0
-                           THEN ' quantum flux quantum flux'
-                           ELSE '' END, ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q290 oracle range(1,200) bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       bg AS (SELECT w[r.range] AS x, w[r.range + 1] AS y
-              FROM s, range(1, 200) r
-              WHERE r.range <= len(w) - 1),
-       nxy AS (SELECT x, y, count(*) AS nxy FROM bg GROUP BY x, y),
-       nx AS (SELECT x, count(*) AS nx FROM bg GROUP BY x),
-       ny AS (SELECT y, count(*) AS ny FROM bg GROUP BY y),
-       nn AS (SELECT count(*) AS n FROM bg)
-       SELECT nxy.x, nxy.y,
-              CAST(nxy.nxy AS BIGINT) AS nxy,
-              CAST(nx.nx AS BIGINT) AS nx,
-              CAST(ny.ny AS BIGINT) AS ny,
-              CAST((length(bin(nxy.nxy * nn.n)) - 1)
-                   - (length(bin(nx.nx * ny.ny)) - 1) AS BIGINT)
-                AS pmi_bits
-       FROM nxy JOIN nx USING (x) JOIN ny USING (y), nn, chk
-       WHERE nxy.nxy >= 5
-         AND nxy.nxy * nn.n >= 4 * nx.nx * ny.ny""",
-)
-def q290(spark, sf_dir):
-    """PMI collocation extraction (Church-Hanks): word bigrams whose
-    joint frequency beats independence by >= 2 bits (the exact
-    cross-multiplied test nxy*N >= 4*nx*ny — no log, no float) and
-    occur >= 5 times; the reported pmi_bits is the floor-log2 proxy
-    (bin()-length difference, exact integers on both engines — the
-    q242/q269 idiom).  Marginals here are BIGRAM-position marginals
-    (x = left-position count, y = right-position count) so
-    nxy <= min(nx, ny) by construction.  Three map-side-combinable
-    counts + one broadcast-size marginal join; the bigram table
-    shuffles once on the gram key at any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    w = docs.select(
-        "doc_id",
-        F.split(
-            F.concat(
-                F.col("text"),
-                F.when(F.col("doc_id") % 6 == 0,
-                       F.lit(" quantum flux quantum flux")).otherwise(""),
-            ),
-            " ",
-        ).alias("w"),
-    )
-    bg = w.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(w) - 1), "
-                "i -> struct(w[i - 1] AS x, w[i] AS y))"
-            )
-        ).alias("p")
-    ).select("p.x", "p.y")
-    nxy = bg.groupBy("x", "y").agg(F.count("*").alias("nxy"))
-    nx = bg.groupBy("x").agg(F.count("*").alias("nx"))
-    ny = bg.groupBy("y").agg(F.count("*").alias("ny"))
-    nn = bg.agg(F.count("*").alias("n"))
-    out = (
-        nxy.join(F.broadcast(nx), "x")
-        .join(F.broadcast(ny), "y")
-        .crossJoin(F.broadcast(nn))
-        .filter(
-            (F.col("nxy") >= 5)
-            & (F.col("nxy") * F.col("n") >= 4 * F.col("nx") * F.col("ny"))
-        )
-    )
-    return out.select(
-        "x", "y",
-        F.col("nxy").cast("long").alias("nxy"),
-        F.col("nx").cast("long").alias("nx"),
-        F.col("ny").cast("long").alias("ny"),
-        (
-            (F.length(F.bin(F.col("nxy") * F.col("n"))) - 1)
-            - (F.length(F.bin(F.col("nx") * F.col("ny"))) - 1)
-        ).cast("long").alias("pmi_bits"),
-    )
-
-
-# --- link-prediction features over the host graph (q291) ----------------------
-
-
-@query(
-    "q291_link_prediction",
-    """WITH h AS (SELECT DISTINCT doc_id % 60 AS hh FROM documents),
-       e0 AS (SELECT hh, unnest([1, 2, 3]) AS j FROM h),
-       ed AS (SELECT DISTINCT least(hh, (hh * j + j * j * 7) % 60) AS u,
-                     greatest(hh, (hh * j + j * j * 7) % 60) AS v
-              FROM e0 WHERE hh <> (hh * j + j * j * 7) % 60),
-       adj AS (SELECT u AS a, v AS b FROM ed
-               UNION ALL SELECT v, u FROM ed),
-       deg AS (SELECT a, count(*) AS deg FROM adj GROUP BY a),
-       wedge AS (SELECT n1.a AS x, n2.a AS y, n1.b AS z
-                 FROM adj n1 JOIN adj n2
-                   ON n1.b = n2.b AND n1.a < n2.a),
-       cand AS (SELECT w.x, w.y, count(*) AS cn,
-                       sum(1048576 // (length(bin(dz.deg)) - 1))
-                         AS aa_scaled
-                FROM wedge w JOIN deg dz ON dz.a = w.z
-                LEFT JOIN ed ON ed.u = w.x AND ed.v = w.y
-                WHERE ed.u IS NULL
-                GROUP BY w.x, w.y)
-       SELECT c.x, c.y,
-              CAST(c.cn AS BIGINT) AS cn,
-              CAST(du.deg AS BIGINT) AS deg_x,
-              CAST(dv.deg AS BIGINT) AS deg_y,
-              CAST(c.aa_scaled AS BIGINT) AS aa_scaled,
-              CAST(CASE WHEN 5 * c.cn >= du.deg + dv.deg - c.cn
-                        THEN 1 ELSE 0 END AS BIGINT) AS jaccard_ge_02
-       FROM cand c JOIN deg du ON du.a = c.x
-                   JOIN deg dv ON dv.a = c.y
-       WHERE c.cn >= 2""",
-)
-def q291(spark, sf_dir):
-    """Link-prediction features over the undirected host graph — the
-    crawl-discovery ranking (which un-linked host pairs will link
-    next): for every NON-edge pair with >= 2 common neighbors
-    (wedge-join candidates, the q275 plan shape — work bounded by
-    wedge count, never node^2), emit common-neighbor count, both
-    degrees, the Adamic-Adar score in EXACT integers (each common
-    neighbor z contributes floor(2^20 / floor(log2 deg(z))) via the
-    bin()-length idiom — deg(z) >= 2 for any wedge center so the
-    divisor is >= 1), and the exact cross-multiplied Jaccard >= 0.2
-    flag (5*cn >= |union|).  Candidate generation is one adjacency
-    self-join + one anti-join against the edge set, all host-keyed."""
-    docs = _t(spark, sf_dir, "documents")
-    h = docs.selectExpr("doc_id % 60 AS hh").distinct()
-    e0 = h.select(
-        "hh", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j")
-    ).selectExpr("hh", "(hh * j + j * j * 7) % 60 AS t")
-    ed = (
-        e0.filter("hh <> t")
-        .selectExpr("least(hh, t) AS u", "greatest(hh, t) AS v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    adj = ed.selectExpr("u AS a", "v AS b").unionAll(
-        ed.selectExpr("v AS a", "u AS b")
-    )
-    deg = adj.groupBy("a").agg(F.count("*").alias("deg"))
-    n1 = adj.selectExpr("a AS x", "b AS z")
-    n2 = adj.selectExpr("a AS y", "b AS z")
-    wedge = n1.join(n2, "z").filter(F.col("x") < F.col("y"))
-    cand = (
-        wedge.join(F.broadcast(deg.selectExpr("a AS z", "deg AS dz")), "z")
-        .join(
-            ed.selectExpr("u AS x", "v AS y"), ["x", "y"], "left_anti"
-        )
-        .groupBy("x", "y")
-        .agg(
-            F.count("*").alias("cn"),
-            F.sum(
-                F.expr("CAST(1048576 div (length(bin(dz)) - 1) AS BIGINT)")
-            ).alias("aa_scaled"),
-        )
-        .filter(F.col("cn") >= 2)
-    )
-    return (
-        cand.join(F.broadcast(deg.selectExpr("a AS x", "deg AS deg_x")),
-                  "x")
-        .join(F.broadcast(deg.selectExpr("a AS y", "deg AS deg_y")), "y")
-        .select(
-            "x", "y",
-            F.col("cn").cast("long").alias("cn"),
-            F.col("deg_x").cast("long").alias("deg_x"),
-            F.col("deg_y").cast("long").alias("deg_y"),
-            F.col("aa_scaled").cast("long").alias("aa_scaled"),
-            F.when(
-                5 * F.col("cn")
-                >= F.col("deg_x") + F.col("deg_y") - F.col("cn"),
-                1,
-            ).otherwise(0).cast("long").alias("jaccard_ge_02"),
-        )
-    )
-
-
-# --- Matryoshka truncated-dimension recall (q292) -----------------------------
-
-
-@query(
-    "q292_truncated_recall",
-    """WITH v AS (SELECT vec_id, list_transform(embedding,
-                    x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                    AS qv
-             FROM embeddings),
-       q AS (SELECT vec_id AS qid, qv AS qqv FROM v WHERE vec_id % 10 = 0),
-       pr AS (SELECT q.qid, v.vec_id AS cand,
-                 CAST(list_sum(list_transform(list_zip(q.qqv, v.qv),
-                      s -> s[1]*s[2])) AS BIGINT) AS dot_full,
-                 CAST(list_sum(list_transform(list_zip(q.qqv[1:16],
-                      v.qv[1:16]), s -> s[1]*s[2])) AS BIGINT) AS dot_t
-              FROM q JOIN v ON v.vec_id <> q.qid),
-       rf AS (SELECT qid, cand,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY dot_full DESC, cand ASC) AS rnk
-              FROM pr),
-       rt AS (SELECT qid, cand,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY dot_t DESC, cand ASC) AS rnk
-              FROM pr)
-       SELECT rf.qid,
-              CAST(count(rt.cand) AS BIGINT) AS overlap5
-       FROM rf LEFT JOIN rt
-         ON rt.qid = rf.qid AND rt.cand = rf.cand AND rt.rnk <= 5
-       WHERE rf.rnk <= 5
-       GROUP BY rf.qid""",
-)
-def q292(spark, sf_dir):
-    """Matryoshka-style truncated-dimension retrieval eval: for each
-    query vector, top-5 by full 64-dim integer-quantized dot vs
-    top-5 by the first-16-dims dot, and the overlap between the two
-    sets (recall@5 of the cheap truncated index against the full
-    index — the measurement that decides whether a 4x-smaller ANN
-    tier is good enough).  Both rankings use deterministic
-    (dot desc, cand asc) order over exact BIGINT dots, so the result
-    is engine-order-free; the per-query ranking windows are the
-    fixture-scale stand-in for the IVF-prefiltered serving path
-    (q127/q148), where each query ranks only its probed cells."""
-    v = _t(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qv",
-    )
-    q = v.filter("vec_id % 10 = 0").selectExpr(
-        "vec_id AS qid", "qv AS qqv")
-    pr = (
-        F.broadcast(q).join(v, F.col("vec_id") != F.col("qid"))
-        .selectExpr(
-            "qid", "vec_id AS cand",
-            "CAST(aggregate(zip_with(qqv, qv, (a, b) -> a * b), "
-            "CAST(0 AS BIGINT), (acc, s) -> acc + s) AS BIGINT) "
-            "AS dot_full",
-            "CAST(aggregate(zip_with(slice(qqv, 1, 16), "
-            "slice(qv, 1, 16), (a, b) -> a * b), CAST(0 AS BIGINT), "
-            "(acc, s) -> acc + s) AS BIGINT) AS dot_t",
-        )
-    )
-    wf = Window.partitionBy("qid").orderBy(
-        F.col("dot_full").desc(), F.col("cand").asc())
-    wt = Window.partitionBy("qid").orderBy(
-        F.col("dot_t").desc(), F.col("cand").asc())
-    rf = pr.select("qid", "cand", F.row_number().over(wf).alias("rnk"))
-    rt = pr.select("qid", "cand", F.row_number().over(wt).alias("rnk"))
-    rts = rt.filter(F.col("rnk") <= 5).select(
-        F.col("qid").alias("tqid"), F.col("cand").alias("tcand"))
-    return (
-        rf.filter(F.col("rnk") <= 5)
-        .join(
-            rts,
-            (F.col("qid") == F.col("tqid"))
-            & (F.col("cand") == F.col("tcand")),
-            "left",
-        )
-        .groupBy("qid")
-        .agg(F.count("tcand").cast("long").alias("overlap5"))
-    )
-
-
-# --- rendezvous (HRW) hashing shard assignment (q293) -------------------------
-
-
-@query(
-    "q293_rendezvous_hashing",
-    """WITH u AS (SELECT DISTINCT 'u' || CAST(doc_id AS VARCHAR) AS url
-                  FROM documents),
-       wts AS (SELECT url, s.range AS shard,
-                 CAST(CAST('0x' || substr(md5('hrw' ||
-                        CAST(s.range AS VARCHAR) || ':' || url), 1, 8)
-                      AS UBIGINT) AS BIGINT) AS w
-               FROM u, range(0, 8) s),
-       a8 AS (SELECT url,
-                     max(w * 8 + (7 - shard)) AS code8
-              FROM wts GROUP BY url),
-       a7 AS (SELECT url,
-                     max(w * 8 + (7 - shard)) AS code7
-              FROM wts WHERE shard < 7 GROUP BY url),
-       asg AS (SELECT a8.url,
-                      7 - (a8.code8 % 8) AS s8,
-                      7 - (a7.code7 % 8) AS s7
-               FROM a8 JOIN a7 USING (url))
-       SELECT s7 AS shard,
-              CAST(sum(CASE WHEN s8 = s7 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_stable,
-              CAST(sum(CASE WHEN s8 <> s7 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_moved_in,
-              CAST(count(*) AS BIGINT) AS n_after
-       FROM asg GROUP BY s7""",
-)
-def q293(spark, sf_dir):
-    """Rendezvous (highest-random-weight) hashing — the shard
-    assignment rule crawl fleets use so that REMOVING a fetcher node
-    moves only that node's URLs (minimal disruption, Thaler-Ravishankar):
-    every (url, shard) pair gets an md5-derived integer weight
-    (pinned conv/UBIGINT idiom) and the url goes to the max-weight
-    shard, encoded as the single combinable integer argmax
-    w*8 + (7-shard) (ties to the LOWEST shard id by construction).
-    The query assigns each url under 8 shards and again under 7
-    (shard 7 removed) and emits per-shard stability accounting —
-    n_moved_in sums exactly to the removed shard's former load, the
-    HRW invariant, pinned in pytest.  Two map-side-combinable
-    argmaxes; at 10^12 URLs nothing shuffles except the 8-row weight
-    explode feeding a url-keyed combine."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("url")
-    ).distinct()
-    wts = u.select(
-        "url", F.explode(F.sequence(F.lit(0), F.lit(7))).alias("shard")
-    ).withColumn(
-        "w",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("hrw"), F.col("shard").cast("string"),
-                               F.lit(":"), F.col("url"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long"),
-    )
-    code = (F.col("w") * 8 + (7 - F.col("shard")))
-    a8 = wts.groupBy("url").agg(F.max(code).alias("code8"))
-    a7 = (
-        wts.filter(F.col("shard") < 7)
-        .groupBy("url")
-        .agg(F.max(code).alias("code7"))
-    )
-    asg = a8.join(a7, "url").select(
-        "url",
-        (7 - F.col("code8") % 8).alias("s8"),
-        (7 - F.col("code7") % 8).alias("s7"),
-    )
-    return asg.groupBy(F.col("s7").alias("shard")).agg(
-        F.sum(F.when(F.col("s8") == F.col("s7"), 1).otherwise(0))
-        .cast("long").alias("n_stable"),
-        F.sum(F.when(F.col("s8") != F.col("s7"), 1).otherwise(0))
-        .cast("long").alias("n_moved_in"),
-        F.count("*").cast("long").alias("n_after"),
-    )
-
-
-# --- log-bin histogram quantile estimation vs exact (q294) --------------------
-
-
-@query(
-    "q294_logbin_quantiles",
-    """WITH v AS (SELECT n_chars AS val FROM documents),
-       n AS (SELECT count(*) AS n FROM v),
-       exact_t AS (SELECT val, count(*) AS c FROM v GROUP BY val),
-       cum AS (SELECT val,
-                      sum(c) OVER (ORDER BY val
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS cum
-               FROM exact_t),
-       bins AS (SELECT length(bin(val)) AS b, count(*) AS c FROM v
-                GROUP BY length(bin(val))),
-       bcum AS (SELECT b,
-                       sum(c) OVER (ORDER BY b
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                         AS cum
-                FROM bins),
-       pcts AS (SELECT p.p, p.num, p.den FROM
-                  (VALUES (50, 1, 2), (90, 9, 10), (99, 99, 100))
-                  p(p, num, den)),
-       ex AS (SELECT pcts.p, min(cum.val) AS exact_val
-              FROM pcts CROSS JOIN n CROSS JOIN cum
-              WHERE cum.cum * pcts.den >= n.n * pcts.num
-              GROUP BY pcts.p),
-       es AS (SELECT pcts.p,
-                     CAST((CAST(1 AS BIGINT) << CAST(min(bcum.b) AS INT))
-                          - 1 AS BIGINT) AS est_hi
-              FROM pcts CROSS JOIN n CROSS JOIN bcum
-              WHERE bcum.cum * pcts.den >= n.n * pcts.num
-              GROUP BY pcts.p)
-       SELECT ex.p AS pct,
-              CAST(ex.exact_val AS BIGINT) AS exact_val,
-              es.est_hi,
-              CAST(es.est_hi AS DOUBLE) / CAST(ex.exact_val AS DOUBLE)
-                AS overestimate
-       FROM ex JOIN es ON es.p = ex.p""",
-)
-def q294(spark, sf_dir):
-    """Log-binned histogram quantile estimation vs exact percentiles —
-    the one-pass mergeable sketch (power-of-two bins, the HdrHistogram
-    / DDSketch family idea with base 2) a fleet uses for latency and
-    doc-length percentiles when exact sorting 10^12 values is off the
-    table: bin = bin()-length (floor-log2 + 1, exact integers), the
-    estimate for percentile p is the upper edge 2^b - 1 of the first
-    bin whose EXACT integer cross-multiplied cumulative passes
-    p (cum*den >= n*num — no float thresholds), and the exact value
-    computed alongside quantifies the relative-error guarantee (the
-    bound is 2x for base-2 bins).  The cumulative windows run over
-    the BOUNDED distinct-value / bin tables, not the corpus."""
-    docs = _t(spark, sf_dir, "documents")
-    v = docs.select(F.col("n_chars").alias("val"))
-    n = v.agg(F.count("*").alias("n"))
-    exact_t = v.groupBy("val").agg(F.count("*").alias("c"))
-    wv = Window.orderBy("val").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    cum = exact_t.select("val", F.sum("c").over(wv).alias("cum"))
-    bins = v.groupBy(F.length(F.bin("val")).alias("b")).agg(
-        F.count("*").alias("c"))
-    wb = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    bcum = bins.select("b", F.sum("c").over(wb).alias("cum"))
-    pcts = spark.createDataFrame(
-        [(50, 1, 2), (90, 9, 10), (99, 99, 100)], "p INT, num INT, den INT"
-    )
-    ex = (
-        F.broadcast(pcts).crossJoin(F.broadcast(n))
-        .join(cum, F.col("cum") * F.col("den") >= F.col("n") * F.col("num"))
-        .groupBy("p").agg(F.min("val").alias("exact_val"))
-    )
-    es = (
-        F.broadcast(pcts).crossJoin(F.broadcast(n))
-        .join(bcum, F.col("cum") * F.col("den") >= F.col("n") * F.col("num"))
-        .groupBy("p")
-        .agg(
-            (
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(min(b) AS INT))")
-                - 1
-            ).cast("long").alias("est_hi")
-        )
-    )
-    return ex.join(es, "p").select(
-        F.col("p").alias("pct"),
-        F.col("exact_val").cast("long").alias("exact_val"),
-        F.col("est_hi").cast("long").alias("est_hi"),
-        (F.col("est_hi").cast("double")
-         / F.col("exact_val").cast("double")).alias("overestimate"),
-    )
-
-
-# --- KWIC snippet extraction (q295) -------------------------------------------
-
-
-@query(
-    "q295_kwic_snippets",
-    """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q295 oracle range(1,200) bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       hits AS (SELECT doc_id, r.range AS pos, len(w) AS lw, w
-                FROM s, range(1, 200) r
-                WHERE r.range <= len(w) AND w[r.range] = 'join')
-       SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-              array_to_string(
-                w[greatest(1, pos - 2):least(lw, pos + 2)], ' ')
-                AS snippet
-       FROM hits, chk""",
-)
-def q295(spark, sf_dir):
-    """KWIC (keyword-in-context) snippet extraction for the probe
-    term 'join' — the search-result surface op: every occurrence
-    position plus a +-2-word window joined back to a string.  Pure
-    per-row array HOFs (position filter + slice + array_join), LINEAR
-    work per row (the interpreted-HOF contract: per-row lambdas are
-    fine when per-row work is ~O(L)); zero shuffle — snippet
-    generation runs at scan speed next to the posting lookup at any
-    corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select("doc_id", F.split("text", " ").alias("w"))
-    hits = s.select(
-        "doc_id",
-        F.size("w").alias("lw"),
-        "w",
-        F.explode(
-            F.expr("filter(sequence(1, size(w)), i -> w[i - 1] = 'join')")
-        ).alias("pos"),
-    )
-    return hits.select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.array_join(
-            F.expr(
-                "slice(w, greatest(1, pos - 2), "
-                "least(lw, pos + 2) - greatest(1, pos - 2) + 1)"
-            ),
-            " ",
-        ).alias("snippet"),
-    )
-
-
-# --- bipartite parity check per component (q296) ------------------------------
-
-
-@query(
-    "q296_bipartite_check",
-    """WITH RECURSIVE ed AS (
-         SELECT i.range AS u, (i.range + 1) % 12 AS v FROM range(0, 12) i
-         UNION ALL
-         SELECT 20 + i.range, 20 + (i.range + 1) % 9 FROM range(0, 9) i),
-       und AS (SELECT u, v FROM ed UNION SELECT v, u FROM ed),
-       seeds AS (SELECT 0 AS root, 0 AS node
-                 UNION ALL SELECT 20, 20),
-       bfs AS (SELECT root, node, 0 AS d FROM seeds
-               UNION
-               SELECT b.root, e.v, b.d + 1
-               FROM bfs b JOIN und e ON e.u = b.node
-               WHERE b.d < 16),
-       dist AS (SELECT root, node, min(d) AS d FROM bfs
-                GROUP BY root, node),
-       conf AS (SELECT d1.root, count(*) AS n_conf
-                FROM ed JOIN dist d1 ON d1.node = ed.u
-                        JOIN dist d2 ON d2.node = ed.v
-                               AND d2.root = d1.root
-                WHERE (d1.d + d2.d) % 2 = 0
-                GROUP BY d1.root)
-       SELECT d.root AS component,
-              CAST(count(*) AS BIGINT) AS n_nodes,
-              CAST(coalesce(max(c.n_conf), 0) AS BIGINT) AS n_conflicts,
-              CAST(CASE WHEN coalesce(max(c.n_conf), 0) = 0 THEN 1 ELSE 0
-                   END AS BIGINT) AS is_bipartite
-       FROM dist d LEFT JOIN conf c ON c.root = d.root
-       GROUP BY d.root""",
-)
-def q296(spark, sf_dir):
-    """Bipartiteness check by parity BFS — the hub/authority
-    two-sidedness test on crawl subgraphs (a bipartite component
-    behaves like a clean site/resource structure; an odd cycle breaks
-    2-coloring): round-synchronous BFS from each component seed
-    (frontier join + min-dist keep, loud 20-round cap), then one edge
-    pass counting SAME-parity endpoints — any such edge certifies an
-    odd cycle.  Fixture: a 12-cycle (even, bipartite) and a 9-cycle
-    (odd, one certificate edge per odd cycle... counted exactly).
-    The oracle closes min-distances with a recursive CTE.  Each BFS
-    round is one frontier equi-join, the standard distributed BFS
-    shape; rounds = component diameter."""
-    spark_range = spark.range(0, 12).selectExpr(
-        "CAST(id AS BIGINT) AS u", "CAST((id + 1) % 12 AS BIGINT) AS v")
-    odd = spark.range(0, 9).selectExpr(
-        "CAST(20 + id AS BIGINT) AS u",
-        "CAST(20 + (id + 1) % 9 AS BIGINT) AS v")
-    ed = spark_range.unionAll(odd).localCheckpoint(eager=True)
-    und = (
-        ed.select("u", "v")
-        .unionAll(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dist = spark.createDataFrame(
-        [(0, 0, 0), (20, 20, 0)], "root LONG, node LONG, d LONG"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for _round in range(20):
-        nxt = (
-            frontier.join(und, frontier.node == und.u)
-            .select("root", F.col("v").alias("node"),
-                    (F.col("d") + 1).alias("d"))
-            .groupBy("root", "node").agg(F.min("d").alias("d"))
-            .join(dist.select("root", "node").withColumn("_s", F.lit(1)),
-                  ["root", "node"], "left")
-            .filter(F.col("_s").isNull())
-            .select("root", "node", "d")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
-        raise RuntimeError("q296 BFS did not converge in 20 rounds")
-    d1 = dist.selectExpr("root", "node AS u", "d AS du")
-    d2 = dist.selectExpr("root AS r2", "node AS v2", "d AS dv")
-    conf = (
-        ed.join(d1, "u")
-        .join(d2, (F.col("v") == F.col("v2"))
-                  & (F.col("root") == F.col("r2")))
-        .filter((F.col("du") + F.col("dv")) % 2 == 0)
-        .groupBy("root").agg(F.count("*").alias("n_conf"))
-    )
-    return (
-        dist.groupBy(F.col("root").alias("component"))
-        .agg(F.count("*").alias("n_nodes"))
-        .join(conf.withColumnRenamed("root", "component"),
-              "component", "left")
-        .select(
-            "component",
-            F.col("n_nodes").cast("long").alias("n_nodes"),
-            F.coalesce("n_conf", F.lit(0)).cast("long")
-            .alias("n_conflicts"),
-            F.when(F.coalesce("n_conf", F.lit(0)) == 0, 1).otherwise(0)
-            .cast("long").alias("is_bipartite"),
-        )
-    )
-
-
-# --- bigram backoff LM surprisal scoring (q297) -------------------------------
-
-
-@query(
-    "q297_bigram_lm_surprisal",
-    """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q297 oracle range(1,200) bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       tr AS (SELECT w FROM s WHERE doc_id % 2 = 0),
-       trbg AS (SELECT w[r.range] AS x, w[r.range + 1] AS y
-                FROM tr, range(1, 200) r WHERE r.range <= len(w) - 1),
-       c2 AS (SELECT x, y, count(*) AS c2 FROM trbg GROUP BY x, y),
-       c1 AS (SELECT x, count(*) AS c1 FROM trbg GROUP BY x),
-       cy AS (SELECT y, count(*) AS cy FROM trbg GROUP BY y),
-       n1 AS (SELECT count(*) AS n FROM trbg),
-       ho AS (SELECT doc_id, w[r.range] AS x, w[r.range + 1] AS y
-              FROM s, range(1, 200) r
-              WHERE doc_id % 2 = 1 AND r.range <= len(w) - 1),
-       sc AS (SELECT ho.doc_id,
-                     CASE WHEN c2.c2 IS NOT NULL THEN
-                       (length(bin(c1.c1)) - 1) - (length(bin(c2.c2)) - 1)
-                     ELSE
-                       8 + (length(bin(n1.n)) - 1)
-                         - (length(bin(coalesce(cy.cy, 0) + 1)) - 1)
-                     END AS bits,
-                     CASE WHEN c2.c2 IS NULL THEN 1 ELSE 0 END AS backoff
-              FROM ho
-              LEFT JOIN c2 ON c2.x = ho.x AND c2.y = ho.y
-              LEFT JOIN c1 ON c1.x = ho.x
-              LEFT JOIN cy ON cy.y = ho.y
-              CROSS JOIN n1)
-       SELECT sc.doc_id,
-              CAST(sum(sc.bits) AS BIGINT) AS surprisal_bits,
-              CAST(sum(sc.backoff) AS BIGINT) AS n_backoffs,
-              CAST(count(*) AS BIGINT) AS n_bigrams
-       FROM sc, chk GROUP BY sc.doc_id""",
-)
-def q297(spark, sf_dir):
-    """Bigram backoff language-model surprisal — the LM-quality
-    filtering pass (CCNet/Dolma style) one level deeper than q243's
-    unigram: train bigram/unigram counts on even doc_ids, score the
-    held-out odd docs; a seen bigram costs the integer surprisal
-    proxy bits(c1(x)) - bits(c2(x,y)) (~ -log2 p(y|x) via the
-    bin()-length floor-log2 idiom — NO transcendental anywhere), an
-    unseen one pays a fixed 8-bit backoff penalty plus the
-    add-one-smoothed unigram cost bits(N) - bits(cy+1).  The c2 join
-    keys on the bigram, the unigram sides broadcast; per-doc
-    aggregation is one map-side-combinable integer sum.  Backoff
-    count rides along (the OOV-rate signal)."""
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select("doc_id", F.split("text", " ").alias("w"))
-    bg = lambda df: df.select(
-        "doc_id",
-        F.explode(
-            F.expr("transform(sequence(1, size(w) - 1), "
-                   "i -> struct(w[i - 1] AS x, w[i] AS y))")
-        ).alias("p"),
-    ).select("doc_id", "p.x", "p.y")
-    trbg = bg(s.filter(F.col("doc_id") % 2 == 0))
-    c2 = trbg.groupBy("x", "y").agg(F.count("*").alias("c2"))
-    c1 = trbg.groupBy("x").agg(F.count("*").alias("c1"))
-    cy = trbg.groupBy("y").agg(F.count("*").alias("cy"))
-    n1 = trbg.agg(F.count("*").alias("n"))
-    ho = bg(s.filter(F.col("doc_id") % 2 == 1))
-    sc = (
-        ho.join(c2, ["x", "y"], "left")
-        .join(F.broadcast(c1), "x", "left")
-        .join(F.broadcast(cy), "y", "left")
-        .crossJoin(F.broadcast(n1))
-        .select(
-            "doc_id",
-            F.when(
-                F.col("c2").isNotNull(),
-                (F.length(F.bin("c1")) - 1) - (F.length(F.bin("c2")) - 1),
-            ).otherwise(
-                8 + (F.length(F.bin("n")) - 1)
-                - (F.length(F.bin(F.coalesce("cy", F.lit(0)) + 1)) - 1)
-            ).alias("bits"),
-            F.when(F.col("c2").isNull(), 1).otherwise(0).alias("backoff"),
-        )
-    )
-    return sc.groupBy("doc_id").agg(
-        F.sum("bits").cast("long").alias("surprisal_bits"),
-        F.sum("backoff").cast("long").alias("n_backoffs"),
-        F.count("*").cast("long").alias("n_bigrams"),
-    )
-
-
-# --- WAND block upper-bound pruning accounting (q298) -------------------------
-
-
-@query(
-    "q298_wand_block_pruning",
-    """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                  FROM documents),
-       tf AS (SELECT word, doc_id, count(*) AS tf FROM w
-              GROUP BY word, doc_id),
-       nd AS (SELECT count(DISTINCT doc_id) AS ndocs FROM w),
-       dft AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
-       blk AS (SELECT tf.word, tf.doc_id // 64 AS blk,
-                      max(tf.tf) AS max_tf, count(*) AS n_docs
-               FROM tf GROUP BY tf.word, tf.doc_id // 64),
-       ub AS (SELECT blk.word, blk.blk, blk.n_docs,
-                     blk.max_tf * (1 + (length(bin(nd.ndocs)) - 1)
-                                     - (length(bin(dft.df)) - 1))
-                       AS score_ub
-              FROM blk JOIN dft USING (word) CROSS JOIN nd)
-       SELECT word,
-              CAST(count(*) AS BIGINT) AS n_blocks,
-              CAST(sum(CASE WHEN score_ub < 12 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_pruned,
-              CAST(sum(CASE WHEN score_ub < 12 THEN n_docs ELSE 0 END)
-                AS BIGINT) AS docs_skipped
-       FROM ub GROUP BY word""",
-)
-def q298(spark, sf_dir):
-    """Block-max WAND pruning accounting (Broder 2003 / Ding-Suel
-    block-max): per term, postings split into 64-doc blocks, each
-    block stores its max term frequency; a block's score upper bound
-    max_tf * (1 + idf_bits) (idf_bits = bits(N) - bits(df), the
-    integer floor-log2 idiom) lets the scorer SKIP every block whose
-    bound misses the threshold (fixed 12 here) — the accounting
-    emits per term how many blocks and how many postings the bound
-    would prune.  This is the index-serving capacity question (what
-    fraction of postings does WAND never touch) answered in exact
-    integers: one (word, block) aggregation + a broadcast df/N join."""
-    docs = _t(spark, sf_dir, "documents")
-    w = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    tf = w.groupBy("word", "doc_id").agg(F.count("*").alias("tf"))
-    nd = w.agg(F.countDistinct("doc_id").alias("ndocs"))
-    dft = tf.groupBy("word").agg(F.count("*").alias("df"))
-    blk = tf.groupBy(
-        "word", F.expr("doc_id div 64").alias("blk")
-    ).agg(F.max("tf").alias("max_tf"), F.count("*").alias("n_docs"))
-    ub = (
-        blk.join(F.broadcast(dft), "word")
-        .crossJoin(F.broadcast(nd))
-        .select(
-            "word", "blk", "n_docs",
-            (
-                F.col("max_tf")
-                * (1 + (F.length(F.bin("ndocs")) - 1)
-                   - (F.length(F.bin("df")) - 1))
-            ).alias("score_ub"),
-        )
-    )
-    return ub.groupBy("word").agg(
-        F.count("*").cast("long").alias("n_blocks"),
-        F.sum(F.when(F.col("score_ub") < 12, 1).otherwise(0)).cast("long")
-        .alias("n_pruned"),
-        F.sum(F.when(F.col("score_ub") < 12, F.col("n_docs")).otherwise(0))
-        .cast("long").alias("docs_skipped"),
-    )
-
-
-# --- recrawl change-rate estimation (q299) ------------------------------------
-
-
-@query(
-    "q299_change_rate",
-    """WITH f AS (SELECT doc_id, t.range AS t,
-                    (t.range * (1 + doc_id % 4)) // 5 AS ver
-                  FROM documents, range(0, 10) t),
-       ch AS (SELECT a.doc_id,
-                     sum(CASE WHEN a.ver <> b.ver THEN 1 ELSE 0 END)
-                       AS n_changes
-              FROM f a JOIN f b
-                ON b.doc_id = a.doc_id AND b.t = a.t - 1
-              GROUP BY a.doc_id)
-       SELECT doc_id,
-              CAST(n_changes AS BIGINT) AS n_changes,
-              CAST(n_changes AS DOUBLE) / 9.0 AS rate_per_fetch,
-              CASE WHEN n_changes * 2 >= 9 THEN 'hot'
-                   WHEN n_changes >= 2 THEN 'warm'
-                   ELSE 'cold' END AS revisit_class
-       FROM ch""",
-)
-def q299(spark, sf_dir):
-    """Recrawl change-rate estimation (the Cho-Garcia-Molina
-    freshness input): 10 simulated fetches per URL with a
-    deterministic integer version step ver(t) = t*(1+doc%4) div 5;
-    changes counted by joining each fetch to its predecessor on
-    (doc, t-1) — NO window, the self-join keys on the url and works
-    shard-local at 10^12 rows; the per-fetch change rate is one
-    division and the revisit class (hot: rate >= 1/2, warm: >= 2
-    changes, cold) is decided by exact integer cross-multiplication.
-    The scheduler consumes the class to set per-URL revisit
-    intervals."""
-    docs = _t(spark, sf_dir, "documents")
-    f = docs.select(
-        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(9))).alias("t")
-    ).select(
-        "doc_id", "t",
-        F.expr("(t * (1 + doc_id % 4)) div 5").alias("ver"),
-    )
-    b = f.selectExpr("doc_id", "t + 1 AS t", "ver AS prev_ver")
-    ch = (
-        f.join(b, ["doc_id", "t"])
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.when(F.col("ver") != F.col("prev_ver"), 1).otherwise(0)
-            ).alias("n_changes")
-        )
-    )
-    return ch.select(
-        "doc_id",
-        F.col("n_changes").cast("long").alias("n_changes"),
-        (F.col("n_changes").cast("double") / F.lit(9.0))
-        .alias("rate_per_fetch"),
-        F.when(F.col("n_changes") * 2 >= 9, "hot")
-        .when(F.col("n_changes") >= 2, "warm")
-        .otherwise("cold").alias("revisit_class"),
-    )
-
-
-# --- host reputation scorecard (q300) -----------------------------------------
-
-
-@query(
-    "q300_host_scorecard",
-    """WITH d AS (SELECT doc_id % 40 AS host, doc_id, text, lang, n_chars,
-                         md5(text) AS h
-                  FROM documents),
-       dup AS (SELECT host, count(*) AS n_docs,
-                      count(DISTINCT h) AS n_unique,
-                      count(DISTINCT lang) AS n_langs,
-                      sum(n_chars) AS total_chars
-               FROM d GROUP BY host),
-       e AS (SELECT DISTINCT doc_id % 40 AS src,
-                    (doc_id * 7 + doc_id // 40) % 40 AS dst
-             FROM documents),
-       er AS (SELECT e.src AS host, count(*) AS n_recip
-              FROM e JOIN e r ON r.src = e.dst AND r.dst = e.src
-              WHERE e.src <> e.dst
-              GROUP BY e.src)
-       SELECT dup.host,
-              CAST(dup.n_docs AS BIGINT) AS n_docs,
-              CAST(dup.n_docs - dup.n_unique AS BIGINT) AS n_dup_docs,
-              CAST(dup.n_langs AS BIGINT) AS n_langs,
-              CAST(dup.total_chars AS BIGINT) AS total_chars,
-              CAST(coalesce(er.n_recip, 0) AS BIGINT) AS n_recip_links,
-              CAST(dup.n_docs - dup.n_unique AS DOUBLE)
-                / CAST(dup.n_docs AS DOUBLE) AS dup_rate
-       FROM dup LEFT JOIN er ON er.host = dup.host""",
-)
-def q300(spark, sf_dir):
-    """Host reputation scorecard — the per-host aggregation a crawl
-    policy actually consumes, composing four signals in one pass:
-    document count, exact-duplicate count (md5 content hash — the
-    q17/q273 dedup key), language diversity, total bytes, and the
-    reciprocal-link count from the q257 spam-signal join; dup_rate
-    is one division over exact integers.  Everything keys on host:
-    one groupBy over documents + one reversed edge self-equi-join —
-    at 10^12 docs the scorecard is a straight map-side-combinable
-    rollup, no row ever leaves its host shard except the edge pass."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        (F.col("doc_id") % 40).alias("host"),
-        "lang", "n_chars", F.md5("text").alias("h"),
-    )
-    dup = d.groupBy("host").agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("h").alias("n_unique"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.sum("n_chars").alias("total_chars"),
-    )
-    e = (
-        docs.selectExpr(
-            "doc_id % 40 AS src",
-            "(doc_id * 7 + doc_id div 40) % 40 AS dst",
-        )
-        .distinct()
-    )
-    r = e.selectExpr("dst AS src", "src AS dst")
-    er = (
-        e.join(r, ["src", "dst"])
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy(F.col("src").alias("host"))
-        .agg(F.count("*").alias("n_recip"))
-    )
-    return dup.join(er, "host", "left").select(
-        "host",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        (F.col("n_docs") - F.col("n_unique")).cast("long")
-        .alias("n_dup_docs"),
-        F.col("n_langs").cast("long").alias("n_langs"),
-        F.col("total_chars").cast("long").alias("total_chars"),
-        F.coalesce("n_recip", F.lit(0)).cast("long")
-        .alias("n_recip_links"),
-        (
-            (F.col("n_docs") - F.col("n_unique")).cast("double")
-            / F.col("n_docs").cast("double")
-        ).alias("dup_rate"),
-    )
-
-
-# --- SymSpell deletion-join spelling correction (q301) ------------------------
-
-
-@query(
-    "q301_symspell_correction",
-    """WITH w AS (SELECT word, count(*) AS df FROM
-                    (SELECT unnest(string_split(text, ' ')) AS word
-                     FROM documents)
-                  GROUP BY word),
-       vr AS (SELECT word, df, row_number() OVER (ORDER BY word) AS rnk
-              FROM w),
-       vkeys AS (SELECT word, df, word AS k FROM w
-                 UNION
-                 SELECT w.word, w.df,
-                        substr(w.word, 1, i.range - 1) ||
-                        substr(w.word, i.range + 1,
-                               length(w.word) - i.range) AS k
-                 FROM w, range(1, 20) i
-                 WHERE i.range <= length(w.word)),
-       probes AS (SELECT p.range AS pid, vr.word AS orig,
-                         substr(vr.word, 1,
-                                (p.range % length(vr.word))) ||
-                         substr(vr.word,
-                                (p.range % length(vr.word)) + 2,
-                                length(vr.word)
-                                  - (p.range % length(vr.word)) - 1)
-                           AS typo
-                  FROM range(0, 10) p
-                  JOIN vr ON vr.rnk = (p.range * 3) + 1),
-       pkeys AS (SELECT pid, typo, typo AS k FROM probes
-                 UNION
-                 SELECT p.pid, p.typo,
-                        substr(p.typo, 1, i.range - 1) ||
-                        substr(p.typo, i.range + 1,
-                               length(p.typo) - i.range) AS k
-                 FROM probes p, range(1, 20) i
-                 WHERE i.range <= length(p.typo)),
-       cand AS (SELECT DISTINCT pk.pid, pk.typo, vk.word, vk.df
-                FROM pkeys pk JOIN vkeys vk ON vk.k = pk.k),
-       m AS (SELECT pid, max(df) AS mdf, count(*) AS n_candidates
-             FROM cand GROUP BY pid),
-       best AS (SELECT c.pid, min(c.word) AS correction
-                FROM cand c JOIN m ON m.pid = c.pid AND c.df = m.mdf
-                GROUP BY c.pid)
-       SELECT m.pid, p.typo, b.correction,
-              CAST(m.mdf AS BIGINT) AS cand_df,
-              CAST(m.n_candidates AS BIGINT) AS n_candidates
-       FROM m JOIN best b ON b.pid = m.pid
-       JOIN (SELECT DISTINCT pid, typo FROM probes) p ON p.pid = m.pid""",
-)
-def q301(spark, sf_dir):
-    """SymSpell-style spelling correction by DELETION-KEY join (the
-    query-rewrite op a search frontend runs): every lexicon word
-    contributes itself plus all single-char-deletion variants as
-    match keys; a typo (here: 10 lexicon words with one deterministic
-    char dropped) matches any lexicon word sharing a key — edit
-    distance <= 2 by the SymSpell property, with NO pairwise edit
-    distance computed; the correction is the max-frequency candidate
-    (ties to lexicographically-least).  Key tables are linear in
-    total word length; the join is key-equi and broadcastable at any
-    corpus size (lexicon-bounded, never corpus-bounded)."""
-    docs = _t(spark, sf_dir, "documents")
-    w = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("word").agg(F.count("*").alias("df"))
-    )
-    dels = (
-        "transform(sequence(1, length({c})), "
-        "i -> concat(substring({c}, 1, i - 1), "
-        "substring({c}, i + 1, length({c}) - i)))"
-    )
-    vkeys = w.select("word", "df", F.col("word").alias("k")).unionByName(
-        w.select(
-            "word", "df",
-            F.explode(F.expr(dels.format(c="word"))).alias("k"),
-        )
-    ).distinct()
-    vr = w.select(
-        "word", F.row_number().over(Window.orderBy("word")).alias("rnk")
-    )
-    probes = (
-        spark.range(0, 10).selectExpr("id AS pid", "id * 3 + 1 AS rnk")
-        .join(F.broadcast(vr), "rnk")
-        .selectExpr(
-            "pid", "word AS orig",
-            "concat(substring(word, 1, CAST(pid % length(word) AS INT)), "
-            "substring(word, CAST(pid % length(word) AS INT) + 2, "
-            "length(word) - CAST(pid % length(word) AS INT) - 1)) AS typo",
-        )
-    )
-    pkeys = probes.select("pid", "typo", F.col("typo").alias("k")).unionByName(
-        probes.select(
-            "pid", "typo",
-            F.explode(F.expr(dels.format(c="typo"))).alias("k"),
-        )
-    ).distinct()
-    cand = (
-        pkeys.join(F.broadcast(vkeys), "k")
-        .select("pid", "typo", "word", "df")
-        .distinct()
-    )
-    m = cand.groupBy("pid").agg(
-        F.max("df").alias("mdf"), F.count("*").alias("n_candidates"))
-    best = (
-        cand.join(m, "pid")
-        .filter(F.col("df") == F.col("mdf"))
-        .groupBy("pid").agg(F.min("word").alias("correction"))
-    )
-    return (
-        m.join(best, "pid")
-        .join(probes.select("pid", "typo").distinct(), "pid")
-        .select(
-            "pid", "typo", "correction",
-            F.col("mdf").cast("long").alias("cand_df"),
-            F.col("n_candidates").cast("long").alias("n_candidates"),
-        )
-    )
-
-
-# --- RAG passage chunking with stride (q302) ----------------------------------
-
-
-@query(
-    "q302_passage_chunking",
-    """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q302 oracle range bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       p AS (SELECT doc_id, k.range AS k,
-                    1 + 15 * k.range AS s0, len(w) AS lw, w
-             FROM s, range(0, 14) k
-             WHERE 1 + 15 * k.range <= len(w))
-       SELECT doc_id, CAST(k AS BIGINT) AS chunk_id,
-              CAST(least(30, lw - s0 + 1) AS BIGINT) AS n_words,
-              substr(md5(array_to_string(
-                w[s0:least(lw, s0 + 29)], ' ')), 1, 8) AS h8
-       FROM p, chk""",
-)
-def q302(spark, sf_dir):
-    """RAG passage chunking — overlap-stride windows (size 30, stride
-    15, partial tail kept) with a per-passage content fingerprint
-    (md5 first 8 hex of the space-joined window; byte-identical on
-    both engines) — the retrieval-corpus prep that turns documents
-    into indexable passages; the hash column is the cross-doc
-    passage-dedup key.  Pure per-row slice + join (linear HOF work),
-    zero shuffle: chunking runs at scan speed next to the tokenizer
-    at any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select("doc_id", F.split("text", " ").alias("w"))
-    p = s.select(
-        "doc_id", F.size("w").alias("lw"), "w",
-        F.explode(F.sequence(F.lit(0), F.lit(13))).alias("k"),
-    ).filter(1 + 15 * F.col("k") <= F.col("lw")).withColumn(
-        "s0", 1 + 15 * F.col("k")
-    )
-    return p.select(
-        "doc_id",
-        F.col("k").cast("long").alias("chunk_id"),
-        F.least(F.lit(30), F.col("lw") - F.col("s0") + 1).cast("long")
-        .alias("n_words"),
-        F.substring(
-            F.md5(
-                F.array_join(
-                    F.expr(
-                        "slice(w, s0, least(lw, s0 + 29) - s0 + 1)"
-                    ),
-                    " ",
-                )
-            ),
-            1, 8,
-        ).alias("h8"),
-    )
-
-
-# --- incremental newcomer dedup vs corpus (q303) ------------------------------
-
-
-@query(
-    "q303_newcomer_dedup",
-    """WITH d AS (SELECT doc_id,
-                    CASE WHEN doc_id % 15 = 9
-                         THEN 'shared template body for ingest dedup'
-                         ELSE text END AS body
-                  FROM documents),
-       corpus AS (SELECT doc_id, md5(body) AS h FROM d
-                  WHERE doc_id % 10 <> 9),
-       newb AS (SELECT doc_id, md5(body) AS h FROM d
-                WHERE doc_id % 10 = 9),
-       hits AS (SELECT n.doc_id, count(*) AS n_matches,
-                       min(c.doc_id) AS first_match
-                FROM newb n JOIN corpus c ON c.h = n.h
-                GROUP BY n.doc_id)
-       SELECT n.doc_id,
-              CAST(CASE WHEN h.n_matches IS NOT NULL THEN 1 ELSE 0 END
-                AS BIGINT) AS is_dup,
-              CAST(coalesce(h.n_matches, 0) AS BIGINT) AS n_matches,
-              CAST(coalesce(h.first_match, -1) AS BIGINT) AS first_match
-       FROM newb n LEFT JOIN hits h ON h.doc_id = n.doc_id""",
-)
-def q303(spark, sf_dir):
-    """Incremental ingest dedup — the ASYMMETRIC join every crawl
-    ingest runs: a small newcomer batch (doc_id%10==9) checks its
-    md5 content hashes against the existing corpus, never corpus x
-    corpus (the q17 batch-dedup shape inverted: at 10^12 docs the
-    newcomer side broadcasts / bucket-probes the corpus hash index,
-    so ingest cost is proportional to the BATCH, not the corpus).
-    A deterministic shared-template body on doc_id%15==9 plants true
-    newcomer-vs-corpus duplicates at every SF (9,39,69,... are
-    newcomers; 24,54,84,... are corpus).  Emits per newcomer the dup
-    flag, match count, and first matching corpus doc."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 15 == 9,
-               F.lit("shared template body for ingest dedup"))
-        .otherwise(F.col("text")).alias("body"),
-    ).withColumn("h", F.md5("body"))
-    corpus = d.filter(F.col("doc_id") % 10 != 9).select(
-        F.col("doc_id").alias("cdoc"), "h")
-    newb = d.filter(F.col("doc_id") % 10 == 9).select("doc_id", "h")
-    hits = (
-        F.broadcast(newb).join(corpus, "h")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_matches"),
-             F.min("cdoc").alias("first_match"))
-    )
-    return newb.join(hits, "doc_id", "left").select(
-        "doc_id",
-        F.when(F.col("n_matches").isNotNull(), 1).otherwise(0)
-        .cast("long").alias("is_dup"),
-        F.coalesce("n_matches", F.lit(0)).cast("long").alias("n_matches"),
-        F.coalesce("first_match", F.lit(-1)).cast("long")
-        .alias("first_match"),
-    )
-
-
-# --- URL-alias / crawl-trap detection (q304) ----------------------------------
-
-
-@query(
-    "q304_crawl_trap_detection",
-    """WITH u AS (SELECT doc_id % 20 AS host,
-                    'https://h' || CAST(doc_id % 20 AS VARCHAR) || '/p'
-                      || CAST(doc_id // 4 AS VARCHAR)
-                      || '?sid=' || CAST(doc_id AS VARCHAR) AS url,
-                    doc_id // 4 AS content_key
-                  FROM documents),
-       agg AS (SELECT host, count(*) AS n_urls,
-                      count(DISTINCT content_key) AS n_content
-               FROM u GROUP BY host)
-       SELECT host,
-              CAST(n_urls AS BIGINT) AS n_urls,
-              CAST(n_content AS BIGINT) AS n_content,
-              CAST(n_urls - n_content AS BIGINT) AS n_alias_urls,
-              CAST(CASE WHEN n_urls >= 2 * n_content THEN 1 ELSE 0 END
-                AS BIGINT) AS is_trap
-       FROM agg""",
-)
-def q304(spark, sf_dir):
-    """URL-alias / crawl-trap detection — the politeness-budget guard
-    (session-id and calendar traps burn fetch quota on one piece of
-    content): per host, distinct URLs vs distinct content keys; a
-    host whose URL count is >= 2x its content count is flagged (the
-    fixture's ?sid= parameter makes every 4-URL group share one
-    content key, so every host trips the detector — the degenerate
-    worst case).  One host-keyed aggregation with two combinable
-    distinct counts; at 10^12 URLs this is the standard per-host
-    rollup next to the q300 scorecard."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        (F.col("doc_id") % 20).alias("host"),
-        F.expr("doc_id div 4").alias("content_key"),
-    )
-    agg = u.groupBy("host").agg(
-        F.count("*").alias("n_urls"),
-        F.countDistinct("content_key").alias("n_content"),
-    )
-    return agg.select(
-        "host",
-        F.col("n_urls").cast("long").alias("n_urls"),
-        F.col("n_content").cast("long").alias("n_content"),
-        (F.col("n_urls") - F.col("n_content")).cast("long")
-        .alias("n_alias_urls"),
-        F.when(F.col("n_urls") >= 2 * F.col("n_content"), 1).otherwise(0)
-        .cast("long").alias("is_trap"),
-    )
-
-
-# --- consistent-hash ring with virtual nodes (q305) ---------------------------
-
-
-@query(
-    "q305_consistent_hash_ring",
-    """WITH u AS (SELECT DISTINCT 'u' || CAST(doc_id AS VARCHAR) AS url
-                  FROM documents),
-       uh AS (SELECT url,
-                CAST(CAST('0x' || substr(md5(url), 1, 8) AS UBIGINT)
-                     AS BIGINT) AS h
-              FROM u),
-       vn AS (SELECT s.range AS shard, v.range AS vnode,
-                CAST(CAST('0x' || substr(md5('ring' ||
-                       CAST(s.range AS VARCHAR) || '.' ||
-                       CAST(v.range AS VARCHAR)), 1, 8) AS UBIGINT)
-                     AS BIGINT) AS vh
-              FROM range(0, 8) s, range(0, 4) v),
-       a4 AS (SELECT uh.url,
-                     min(((vn.vh - uh.h + 4294967296) % 4294967296) * 64
-                         + vn.shard * 8 + vn.vnode) AS code
-              FROM uh CROSS JOIN vn
-              GROUP BY uh.url),
-       a1 AS (SELECT uh.url,
-                     min(((vn.vh - uh.h + 4294967296) % 4294967296) * 64
-                         + vn.shard * 8 + vn.vnode) AS code
-              FROM uh CROSS JOIN vn
-              WHERE vn.vnode = 0
-              GROUP BY uh.url),
-       asg AS (SELECT a4.url,
-                      (a4.code % 64) // 8 AS s4,
-                      (a1.code % 64) // 8 AS s1
-               FROM a4 JOIN a1 USING (url)),
-       l4 AS (SELECT s4 AS shard, count(*) AS load_vn4 FROM asg
-              GROUP BY s4),
-       l1 AS (SELECT s1 AS shard, count(*) AS load_vn1 FROM asg
-              GROUP BY s1),
-       shards AS (SELECT s.range AS shard FROM range(0, 8) s)
-       SELECT shards.shard,
-              CAST(coalesce(l4.load_vn4, 0) AS BIGINT) AS load_vn4,
-              CAST(coalesce(l1.load_vn1, 0) AS BIGINT) AS load_vn1
-       FROM shards LEFT JOIN l4 USING (shard) LEFT JOIN l1 USING (shard)""",
-)
-def q305(spark, sf_dir):
-    """Consistent-hash ring assignment with virtual nodes (Karger) —
-    the OTHER fleet sharding scheme next to q293's HRW: each shard
-    owns 4 ring positions (md5-derived 32-bit points); a URL goes to
-    the first vnode CLOCKWISE from its own hash, computed exactly as
-    the integer argmin of (vh - h) mod 2^32, encoded combinably as
-    delta*64 + shard*8 + vnode (deterministic tie-break).  The query
-    assigns under 4 vnodes/shard and under 1 vnode/shard and emits
-    both per-shard loads — the variance reduction from virtual nodes
-    is directly visible.  Ring table is 32 rows broadcast; the
-    assignment is one map-side-combinable argmin per URL."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("url")
-    ).distinct()
-    uh = u.withColumn(
-        "h", F.conv(F.substring(F.md5("url"), 1, 8), 16, 10).cast("long"))
-    vn = (
-        spark.range(0, 8).selectExpr("id AS shard")
-        .crossJoin(spark.range(0, 4).selectExpr("id AS vnode"))
-        .withColumn(
-            "vh",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("ring"),
-                                   F.col("shard").cast("string"),
-                                   F.lit("."),
-                                   F.col("vnode").cast("string"))),
-                    1, 8,
-                ),
-                16, 10,
-            ).cast("long"),
-        )
-    )
-    code = (
-        ((F.col("vh") - F.col("h") + F.lit(4294967296)) % 4294967296) * 64
-        + F.col("shard") * 8 + F.col("vnode")
-    )
-    a4 = (
-        uh.crossJoin(F.broadcast(vn))
-        .groupBy("url").agg(F.min(code).alias("code4"))
-    )
-    a1 = (
-        uh.crossJoin(F.broadcast(vn.filter(F.col("vnode") == 0)))
-        .groupBy("url").agg(F.min(code).alias("code1"))
-    )
-    asg = a4.join(a1, "url").select(
-        F.expr("(code4 % 64) div 8").alias("s4"),
-        F.expr("(code1 % 64) div 8").alias("s1"),
-    )
-    l4 = asg.groupBy(F.col("s4").alias("shard")).agg(
-        F.count("*").alias("load_vn4"))
-    l1 = asg.groupBy(F.col("s1").alias("shard")).agg(
-        F.count("*").alias("load_vn1"))
-    shards = spark.range(0, 8).selectExpr("id AS shard")
-    return (
-        shards.join(l4, "shard", "left").join(l1, "shard", "left")
-        .select(
-            "shard",
-            F.coalesce("load_vn4", F.lit(0)).cast("long")
-            .alias("load_vn4"),
-            F.coalesce("load_vn1", F.lit(0)).cast("long")
-            .alias("load_vn1"),
-        )
-    )
-
-
-# --- trending-burst detection over event streams (q306) -----------------------
-
-
-@query(
-    "q306_burst_detection",
-    """WITH e AS (SELECT event_type, date_trunc('day', ts) AS d
-                  FROM events),
-       c AS (SELECT event_type, d, count(*) AS c FROM e GROUP BY 1, 2),
-       r AS (SELECT event_type, sum(c) AS rt FROM c GROUP BY 1),
-       col AS (SELECT d, sum(c) AS ct FROM c GROUP BY 1),
-       t AS (SELECT count(*) AS tt FROM e)
-       SELECT c.event_type, c.d AS day,
-              CAST(c.c AS BIGINT) AS n,
-              CAST(r.rt AS BIGINT) AS type_total,
-              CAST(col.ct AS BIGINT) AS day_total,
-              CAST(CASE WHEN 8 * c.c * t.tt >= 9 * r.rt * col.ct
-                        THEN 1 ELSE 0 END AS BIGINT) AS is_burst
-       FROM c JOIN r USING (event_type) JOIN col USING (d)
-       CROSS JOIN t""",
-)
-def q306(spark, sf_dir):
-    """Trending-burst detection over the event stream — the
-    rate-anomaly gate (Kleinberg-style burst, decided by LIFT): a
-    (type, day) cell bursts when its count exceeds 9/8 of the
-    independence expectation rate_type * total_day / total, tested by
-    EXACT integer cross-multiplication 8*c*T >= 9*rt*ct — no float
-    rates anywhere.  At the audit SF the Poisson noise of ~70-count
-    cells puts real cells on both sides of the 1.125x threshold, so
-    both branches fire.  Three map-side-combinable counts + two
-    broadcast marginal joins — the same shuffle-free shape as q284's
-    chi-square at any event volume."""
-    e = _t(spark, sf_dir, "events").select(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-    c = e.groupBy("event_type", "d").agg(F.count("*").alias("c"))
-    r = c.groupBy("event_type").agg(F.sum("c").alias("rt"))
-    col = c.groupBy("d").agg(F.sum("c").alias("ct"))
-    t = e.agg(F.count("*").alias("tt"))
-    return (
-        c.join(F.broadcast(r), "event_type")
-        .join(F.broadcast(col), "d")
-        .crossJoin(F.broadcast(t))
-        .select(
-            "event_type", F.col("d").alias("day"),
-            F.col("c").cast("long").alias("n"),
-            F.col("rt").cast("long").alias("type_total"),
-            F.col("ct").cast("long").alias("day_total"),
-            F.when(
-                8 * F.col("c") * F.col("tt")
-                >= 9 * F.col("rt") * F.col("ct"), 1
-            ).otherwise(0).cast("long").alias("is_burst"),
-        )
-    )
-
-
-# --- degree assortativity of the host graph (q307) ----------------------------
-
-
-@query(
-    "q307_degree_assortativity",
-    """WITH e AS (SELECT DISTINCT doc_id % 50 AS src,
-                         (doc_id * 3 + 1) % 50 AS dst FROM documents
-                  UNION
-                  SELECT DISTINCT doc_id % 50, (doc_id * 7 + 11) % 50
-                  FROM documents),
-       ed AS (SELECT src, dst FROM e WHERE src <> dst),
-       od AS (SELECT src, count(*) AS od FROM ed GROUP BY src),
-       idg AS (SELECT dst, count(*) AS idg FROM ed GROUP BY dst),
-       j AS (SELECT od.od AS x, idg.idg AS y
-             FROM ed JOIN od USING (src) JOIN idg USING (dst)),
-       s AS (SELECT count(*) AS m, sum(x) AS sx, sum(y) AS sy,
-                    sum(x*y) AS sxy, sum(x*x) AS sxx, sum(y*y) AS syy
-             FROM j)
-       SELECT CAST(m AS BIGINT) AS m,
-              CAST(sx AS BIGINT) AS sx, CAST(sy AS BIGINT) AS sy,
-              CAST(sxy AS BIGINT) AS sxy,
-              CAST(sxx AS BIGINT) AS sxx, CAST(syy AS BIGINT) AS syy,
-              CAST(m*sxy - sx*sy AS DOUBLE)
-                / sqrt(CAST(m*sxx - sx*sx AS DOUBLE)
-                       * CAST(m*syy - sy*sy AS DOUBLE)) AS r
-       FROM s""",
-)
-def q307(spark, sf_dir):
-    """Degree assortativity of the directed host graph — Pearson
-    correlation of (out-degree of source, in-degree of target) over
-    edges, the classic webgraph structure metric (the web is
-    disassortative; spam farms skew it): all five moments are EXACT
-    BIGINT sums over the edge list (the q271 OLS pattern), and the
-    coefficient is one fixed float expression (numerator / sqrt of
-    product) evaluated identically by both engines on identical
-    integers.  One edge scan + two broadcast degree joins + a single
-    global aggregate — no shuffle wider than the degree tables at
-    web scale."""
-    docs = _t(spark, sf_dir, "documents")
-    e = (
-        docs.selectExpr("doc_id % 50 AS src", "(doc_id * 3 + 1) % 50 AS dst")
-        .unionByName(
-            docs.selectExpr("doc_id % 50 AS src",
-                            "(doc_id * 7 + 11) % 50 AS dst"))
-        .distinct()
-        .filter("src <> dst")
-    )
-    od = e.groupBy("src").agg(F.count("*").alias("od"))
-    idg = e.groupBy("dst").agg(F.count("*").alias("idg"))
-    j = (
-        e.join(F.broadcast(od), "src")
-        .join(F.broadcast(idg), "dst")
-        .selectExpr("od AS x", "idg AS y")
-    )
-    s = j.agg(
-        F.count("*").alias("m"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    return s.select(
-        F.col("m").cast("long").alias("m"),
-        F.col("sx").cast("long").alias("sx"),
-        F.col("sy").cast("long").alias("sy"),
-        F.col("sxy").cast("long").alias("sxy"),
-        F.col("sxx").cast("long").alias("sxx"),
-        F.col("syy").cast("long").alias("syy"),
-        (
-            (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            .cast("double")
-            / F.sqrt(
-                (F.col("m") * F.col("sxx")
-                 - F.col("sx") * F.col("sx")).cast("double")
-                * (F.col("m") * F.col("syy")
-                   - F.col("sy") * F.col("sy")).cast("double")
-            )
-        ).alias("r"),
-    )
-
-
-# --- content-defined chunking boundaries (q308) -------------------------------
-
-
-@query(
-    "q308_cdc_boundaries",
-    """WITH s AS (SELECT doc_id, text, length(text) AS lt
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(lt) > 599
-                      THEN error('q308 oracle range bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       pos AS (SELECT doc_id, i.range AS i,
-                 (CAST(ascii(substr(text, i.range, 1)) AS BIGINT)
-                  + CAST(ascii(substr(text, i.range - 1, 1)) AS BIGINT) * 31
-                  + CAST(ascii(substr(text, i.range - 2, 1)) AS BIGINT) * 961
-                  + CAST(ascii(substr(text, i.range - 3, 1)) AS BIGINT)
-                    * 29791
-                  + CAST(ascii(substr(text, i.range - 4, 1)) AS BIGINT)
-                    * 923521
-                  + CAST(ascii(substr(text, i.range - 5, 1)) AS BIGINT)
-                    * 28629151
-                  + CAST(ascii(substr(text, i.range - 6, 1)) AS BIGINT)
-                    * 887503681
-                  + CAST(ascii(substr(text, i.range - 7, 1)) AS BIGINT)
-                    * 27512614111)
-                   % 64 AS h64
-               FROM s, range(8, 600) i WHERE i.range <= lt)
-       SELECT pos.doc_id,
-              CAST(sum(CASE WHEN h64 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_boundaries,
-              CAST(sum(CASE WHEN h64 = 0 THEN i ELSE 0 END) AS BIGINT)
-                AS boundary_poschk,
-              CAST(max(s2.lt) AS BIGINT) AS n_chars
-       FROM pos JOIN s s2 USING (doc_id), chk
-       GROUP BY pos.doc_id""",
-)
-def q308(spark, sf_dir):
-    """Content-defined chunking (LBFS/restic-style) boundary
-    accounting — the dedup-storage split rule that survives insertions
-    (a fixed-offset split would shift every later chunk): position i
-    is a boundary when the 8-char polynomial rolling hash
-    sum(ascii(c_{i-j}) * 31^j) is 0 mod 64 (expected chunk ~64
-    chars).  Each position's hash is an 8-term integer expression —
-    O(8L) per document, fully codegen'd, position-exploded exactly
-    like the n-gram tables (no sequential fold, no Python).  Emits
-    per doc the boundary count, an order-sensitive position checksum,
-    and length; the boundary hash IS the dedup anchor key at
-    exabyte-store scale."""
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select("doc_id", "text", F.length("text").alias("lt"))
-    pw = [31 ** j for j in range(8)]
-    terms = " + ".join(
-        f"CAST(ascii(substring(text, i - {j}, 1)) AS BIGINT) * {pw[j]}"
-        if j else "CAST(ascii(substring(text, i, 1)) AS BIGINT)"
-        for j in range(8)
-    )
-    pos = (
-        s.select(
-            "doc_id", "text", "lt",
-            F.explode(F.expr("sequence(8, lt)")).alias("i"),
-        )
-        .withColumn("h64", F.expr(f"({terms}) % 64"))
-    )
-    return pos.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("h64") == 0, 1).otherwise(0)).cast("long")
-        .alias("n_boundaries"),
-        F.sum(F.when(F.col("h64") == 0, F.col("i")).otherwise(0))
-        .cast("long").alias("boundary_poschk"),
-        F.max("lt").cast("long").alias("n_chars"),
-    )
-
-
-# --- strongly connected component of the pivot (q309) -------------------------
-
-
-@query(
-    "q309_scc_of_pivot",
-    """WITH RECURSIVE ed AS (
-         SELECT DISTINCT doc_id % 50 AS src, (doc_id * 3 + 1) % 50 AS dst
-         FROM documents
-         UNION
-         SELECT DISTINCT doc_id % 50, (doc_id * 7 + 11) % 50
-         FROM documents),
-       e2 AS (SELECT src, dst FROM ed WHERE src <> dst),
-       fwd AS (SELECT 0 AS node
-               UNION
-               SELECT e2.dst FROM fwd JOIN e2 ON e2.src = fwd.node),
-       bwd AS (SELECT 0 AS node
-               UNION
-               SELECT e2.src FROM bwd JOIN e2 ON e2.dst = bwd.node),
-       nodes AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM e2
-                    UNION ALL SELECT dst FROM e2))
-       SELECT n.node,
-              CAST(CASE WHEN f.node IS NOT NULL THEN 1 ELSE 0 END
-                AS BIGINT) AS fwd_reach,
-              CAST(CASE WHEN b.node IS NOT NULL THEN 1 ELSE 0 END
-                AS BIGINT) AS bwd_reach,
-              CAST(CASE WHEN f.node IS NOT NULL AND b.node IS NOT NULL
-                        THEN 1 ELSE 0 END AS BIGINT) AS in_scc
-       FROM nodes n
-       LEFT JOIN (SELECT DISTINCT node FROM fwd) f ON f.node = n.node
-       LEFT JOIN (SELECT DISTINCT node FROM bwd) b ON b.node = n.node""",
-)
-def q309(spark, sf_dir):
-    """Strongly connected component of a pivot (the FW-BW step of
-    distributed SCC decomposition, Fleischer et al.): the pivot's SCC
-    is exactly (forward-reachable set) intersect (backward-reachable
-    set) — two round-synchronous BFS closures (frontier equi-join +
-    anti-join vs visited, loud 32-round caps) over the directed host
-    graph, one on edges and one on reversed edges, then two flag
-    joins.  On the web graph this is the core extraction step that
-    peels the giant SCC (the 'bowtie' center) before recursing on the
-    remainder; each round is one host-keyed equi-join."""
-    docs = _t(spark, sf_dir, "documents")
-    e2 = (
-        docs.selectExpr("doc_id % 50 AS src", "(doc_id * 3 + 1) % 50 AS dst")
-        .unionByName(
-            docs.selectExpr("doc_id % 50 AS src",
-                            "(doc_id * 7 + 11) % 50 AS dst"))
-        .distinct()
-        .filter("src <> dst")
-        .localCheckpoint(eager=True)
-    )
-
-    def closure(edges, key_out, key_in):
-        reach = spark.createDataFrame([(0,)], "node LONG").localCheckpoint(
-            eager=True)
-        frontier = reach
-        for _round in range(32):
-            nxt = (
-                frontier.join(edges, frontier.node == edges[key_out])
-                .select(F.col(key_in).alias("node")).distinct()
-                .join(reach.withColumnRenamed("node", "seen"),
-                      F.col("node") == F.col("seen"), "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.count() == 0:
-                break
-            reach = reach.unionAll(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        else:
-            raise RuntimeError("q309 BFS did not converge in 32 rounds")
-        return reach
-
-    fwd = closure(e2, "src", "dst")
-    bwd = closure(e2, "dst", "src")
-    nodes = (
-        e2.selectExpr("src AS node").unionAll(e2.selectExpr("dst AS node"))
-        .distinct()
-    )
-    return (
-        nodes.join(fwd.withColumn("_f", F.lit(1)), "node", "left")
-        .join(bwd.withColumnRenamed("node", "bn").withColumn(
-            "_b", F.lit(1)),
-            F.col("node") == F.col("bn"), "left")
-        .select(
-            "node",
-            F.when(F.col("_f").isNotNull(), 1).otherwise(0).cast("long")
-            .alias("fwd_reach"),
-            F.when(F.col("_b").isNotNull(), 1).otherwise(0).cast("long")
-            .alias("bwd_reach"),
-            F.when(F.col("_f").isNotNull() & F.col("_b").isNotNull(), 1)
-            .otherwise(0).cast("long").alias("in_scc"),
-        )
-    )
-
-
-# --- term- vs doc-partitioned index balance (q310) ----------------------------
-
-
-@query(
-    "q310_index_partition_balance",
-    """WITH p AS (SELECT DISTINCT word, doc_id FROM
-                    (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                     FROM documents)),
-       tshard AS (SELECT CAST(CAST('0x' || substr(md5(word), 1, 8)
-                          AS UBIGINT) % 8 AS BIGINT) AS shard,
-                         count(*) AS postings
-                  FROM p GROUP BY 1),
-       dshard AS (SELECT doc_id % 8 AS shard, count(*) AS postings,
-                         count(DISTINCT word) AS n_terms
-                  FROM p GROUP BY 1),
-       shards AS (SELECT s.range AS shard FROM range(0, 8) s)
-       SELECT shards.shard,
-              CAST(coalesce(t.postings, 0) AS BIGINT)
-                AS postings_term_part,
-              CAST(coalesce(d.postings, 0) AS BIGINT)
-                AS postings_doc_part,
-              CAST(coalesce(d.n_terms, 0) AS BIGINT) AS terms_doc_part
-       FROM shards LEFT JOIN tshard t USING (shard)
-       LEFT JOIN dshard d USING (shard)""",
-)
-def q310(spark, sf_dir):
-    """Term- vs document-partitioned index balance — the first
-    decision of distributed index design (term partitioning risks
-    hot-term skew, document partitioning replicates the lexicon):
-    posting loads per shard under md5-hash term sharding vs doc_id
-    sharding, plus the per-shard lexicon size the doc layout pays.
-    Pure aggregation accounting on the postings table; the skew
-    visible in postings_term_part vs the near-uniform
-    postings_doc_part IS the argument (every engine from Google to
-    ES chose doc partitioning for it)."""
-    docs = _t(spark, sf_dir, "documents")
-    p = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .distinct()
-    )
-    tshard = p.groupBy(
-        (F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("long") % 8)
-        .alias("shard")
-    ).agg(F.count("*").alias("tp"))
-    dshard = p.groupBy((F.col("doc_id") % 8).alias("shard")).agg(
-        F.count("*").alias("dp"),
-        F.countDistinct("word").alias("n_terms"),
-    )
-    shards = spark.range(0, 8).selectExpr("id AS shard")
-    return (
-        shards.join(tshard, "shard", "left")
-        .join(dshard, "shard", "left")
-        .select(
-            "shard",
-            F.coalesce("tp", F.lit(0)).cast("long")
-            .alias("postings_term_part"),
-            F.coalesce("dp", F.lit(0)).cast("long")
-            .alias("postings_doc_part"),
-            F.coalesce("n_terms", F.lit(0)).cast("long")
-            .alias("terms_doc_part"),
-        )
-    )
+       FROM agg JOIN truth USING (host)"""
 
 
 # --- streaming HLL registers (q311) -------------------------------------------
 
 
-@query("q311_streaming_hll", ORACLES["q279_hll_cardinality"])
+@query("q311_streaming_hll", _HLL_ORACLE, kind="operator")
 def q311(spark, sf_dir):
     """STREAMING HyperLogLog: the q279 sketch maintained by a real
     Structured Streaming query (streaming/windowed.py::
@@ -17147,1101 +9600,33 @@ def q311(spark, sf_dir):
     )
 
 
-# --- MMR diversified top-5 retrieval (q312) -----------------------------------
-
-
-def _mmr_oracle_sql():
-    """Mechanically unroll the 5 greedy MMR rounds as chained CTEs:
-    round k scores every remaining candidate 2*rel - max_sim_to_sel
-    and picks the (score desc, cand asc) argmax via NOT EXISTS."""
-    head = """WITH v AS (SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                 AS qv FROM embeddings),
-       qv0 AS (SELECT qv FROM v WHERE vec_id = 0),
-       c AS (SELECT v.vec_id AS cand, v.qv,
-               CAST(list_sum(list_transform(list_zip(qv0.qv, v.qv),
-                    s -> s[1]*s[2])) AS BIGINT) AS rel
-             FROM v, qv0 WHERE v.vec_id <> 0)"""
-    prev_sel = None
-    parts = [head]
-    for k in range(1, 6):
-        if prev_sel is None:
-            parts.append(f""",
-       p{k} AS (SELECT cand, 2 * rel AS score FROM c)""")
-        else:
-            parts.append(f""",
-       p{k} AS (SELECT c.cand, 2 * c.rel - max(
-                  CAST(list_sum(list_transform(list_zip(c.qv, sv.qv),
-                       s -> s[1]*s[2])) AS BIGINT)) AS score
-               FROM c CROSS JOIN {prev_sel} s
-               JOIN v sv ON sv.vec_id = s.cand
-               WHERE c.cand NOT IN (SELECT cand FROM {prev_sel})
-               GROUP BY c.cand, c.rel)""")
-        parts.append(f""",
-       w{k} AS (SELECT cand, score FROM p{k} a
-               WHERE NOT EXISTS (SELECT 1 FROM p{k} b
-                 WHERE b.score > a.score
-                    OR (b.score = a.score AND b.cand < a.cand))),
-       sel{k} AS ({"SELECT cand, score FROM w" + str(k)
-                   if k == 1 else
-                   f"SELECT cand, score FROM sel{k-1} UNION ALL "
-                   f"SELECT cand, score FROM w{k}"})""")
-        prev_sel = f"sel{k}"
-    parts.append("""
-       SELECT s.cand, CAST(s.score AS BIGINT) AS mmr_scaled,
-              CAST(c.rel AS BIGINT) AS rel
-       FROM sel5 s JOIN c ON c.cand = s.cand""")
-    return "".join(parts)
-
-
-@query("q312_mmr_diversified_topk", _mmr_oracle_sql())
-def q312(spark, sf_dir):
-    """Maximal Marginal Relevance diversified top-5 (Carbonell-
-    Goldstein) — the dedup-aware reranker every retrieval stack runs
-    so five near-identical passages don't fill the context window:
-    greedily pick argmax of 2*rel(c) - max_{s in S} sim(c, s)
-    (lambda=1/2 cross-multiplied into integers; rel and sim are the
-    exact quantized dots), ties to lowest id.  Five round-synchronous
-    rounds; each round the selected set (<= 4 rows) BROADCASTS
-    against the remaining candidates, so the pairwise-sim work is
-    |C| x |S|, never |C|^2 — the oracle unrolls the same 5 rounds as
-    chained CTEs with NOT-EXISTS argmaxes."""
-    emb = _t(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qv",
-    ).localCheckpoint(eager=True)
-    qv0 = emb.filter("vec_id = 0").selectExpr("qv AS q0")
-    c = (
-        emb.filter("vec_id <> 0").crossJoin(F.broadcast(qv0))
-        .selectExpr(
-            "vec_id AS cand", "qv",
-            "CAST(aggregate(zip_with(q0, qv, (a, b) -> a * b), "
-            "CAST(0 AS BIGINT), (acc, s) -> acc + s) AS BIGINT) AS rel",
-        )
-        .localCheckpoint(eager=True)
-    )
-    sel = None  # DataFrame(cand, score)
-    for k in range(5):
-        if sel is None:
-            p = c.selectExpr("cand", "2 * rel AS score")
-        else:
-            sv = sel.select("cand").join(
-                emb.selectExpr("vec_id AS cand", "qv AS sqv"), "cand"
-            ).select("sqv")
-            rem = c.join(sel.select("cand"), "cand", "left_anti")
-            p = (
-                rem.crossJoin(F.broadcast(sv))
-                .selectExpr(
-                    "cand", "rel",
-                    "CAST(aggregate(zip_with(qv, sqv, (a, b) -> a * b), "
-                    "CAST(0 AS BIGINT), (acc, s) -> acc + s) AS BIGINT)"
-                    " AS sim",
-                )
-                .groupBy("cand", "rel")
-                .agg(F.max("sim").alias("maxsim"))
-                .selectExpr("cand", "2 * rel - maxsim AS score")
-            )
-        top = p.agg(
-            F.max(
-                (F.col("score") + 100000000) * 100000
-                + (99999 - F.col("cand"))
-            ).alias("code")
-        ).selectExpr(
-            "CAST(99999 - (code % 100000) AS BIGINT) AS cand",
-            "CAST((code div 100000) - 100000000 AS BIGINT) AS score",
-        )
-        sel = top if sel is None else sel.unionAll(top)
-        sel = sel.localCheckpoint(eager=True)
-    return sel.join(c.select("cand", "rel"), "cand").select(
-        "cand",
-        F.col("score").cast("long").alias("mmr_scaled"),
-        F.col("rel").cast("long").alias("rel"),
-    )
-
-
-# --- cross-source contamination matrix (q313) ---------------------------------
-
-
-@query(
-    "q313_cross_source_contamination",
-    """WITH d AS (SELECT doc_id, source,
-                    md5(CASE WHEN doc_id % 9 = 0
-                        THEN 'shared contamination template'
-                        ELSE text END) AS h
-                  FROM documents),
-       pr AS (SELECT least(a.source, b.source) AS src_a,
-                     greatest(a.source, b.source) AS src_b,
-                     a.h
-              FROM d a JOIN d b
-                ON a.h = b.h AND a.doc_id < b.doc_id
-               AND a.source <> b.source)
-       SELECT src_a, src_b,
-              CAST(count(*) AS BIGINT) AS n_pairs,
-              CAST(count(DISTINCT h) AS BIGINT) AS n_shared_hashes
-       FROM pr GROUP BY src_a, src_b""",
-)
-def q313(spark, sf_dir):
-    """Cross-source contamination matrix — which corpus slices leak
-    into each other (the check run before claiming slices are
-    independent, e.g. benchmark slices vs training slices): pairs of
-    docs from DIFFERENT sources sharing an md5 content hash,
-    aggregated per unordered source pair.  The hash equi-join makes
-    candidate volume sum(dup_group^2), never corpus^2 — the q17
-    dedup shape with a source-inequality residual; a deterministic
-    template on doc_id%9==0 plants a cross-source dup group at every
-    SF."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", "source",
-        F.md5(
-            F.when(F.col("doc_id") % 9 == 0,
-                   F.lit("shared contamination template"))
-            .otherwise(F.col("text"))
-        ).alias("h"),
-    )
-    b = d.selectExpr("doc_id AS bdoc", "source AS bsrc", "h")
-    pr = (
-        d.join(b, "h")
-        .filter((F.col("doc_id") < F.col("bdoc"))
-                & (F.col("source") != F.col("bsrc")))
-        .select(
-            F.least("source", "bsrc").alias("src_a"),
-            F.greatest("source", "bsrc").alias("src_b"),
-            "h",
-        )
-    )
-    return pr.groupBy("src_a", "src_b").agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.countDistinct("h").cast("long").alias("n_shared_hashes"),
-    )
-
-
-# --- quality-stratified deterministic hash sampling (q314) --------------------
-
-
-@query(
-    "q314_stratified_hash_sampling",
-    """WITH d AS (SELECT doc_id, n_chars AS val FROM documents),
-       n AS (SELECT count(*) AS n FROM d),
-       cum AS (SELECT val, count(*) AS c FROM d GROUP BY val),
-       rk AS (SELECT a.val, sum(b.c) AS rank_le
-              FROM cum a JOIN cum b ON b.val <= a.val
-              GROUP BY a.val),
-       dec AS (SELECT d.doc_id, d.val,
-                      ((rk.rank_le - 1) * 10) // n.n + 1 AS decile
-               FROM d JOIN rk USING (val) CROSS JOIN n),
-       kept AS (SELECT decile, doc_id,
-                       CAST(CAST('0x' || substr(md5('s' ||
-                              CAST(doc_id AS VARCHAR)), 1, 8)
-                            AS UBIGINT) % 10 AS BIGINT) AS slot
-                FROM dec)
-       SELECT decile,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(CASE WHEN slot = 0 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_kept,
-              CAST(min(doc_id) AS BIGINT) AS min_doc
-       FROM kept GROUP BY decile""",
-)
-def q314(spark, sf_dir):
-    """Quality-stratified deterministic hash sampling — the dataset
-    curation pass that takes a FIXED fraction from every quality
-    stratum (here: n_chars deciles) without any randomness: decile =
-    exact integer rank arithmetic ((rank_le-1)*10 div N + 1, the
-    rank table is value-keyed and BOUNDED by distinct values, not
-    corpus size), and the kept set is md5(doc)%10==0 — a pure filter
-    that needs no shuffle, is reproducible forever, and at 10^12
-    docs samples each stratum at exactly the hash rate with zero
-    coordination (the p-sampling idiom; per-stratum exact-k quotas
-    would need a per-stratum sort)."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select("doc_id", F.col("n_chars").alias("val"))
-    n = d.agg(F.count("*").alias("n"))
-    cum = d.groupBy("val").agg(F.count("*").alias("c"))
-    b = cum.selectExpr("val AS bval", "c AS bc")
-    rk = (
-        cum.join(F.broadcast(b), F.col("bval") <= F.col("val"))
-        .groupBy("val").agg(F.sum("bc").alias("rank_le"))
-    )
-    dec = (
-        d.join(F.broadcast(rk), "val")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            (F.expr("((rank_le - 1) * 10) div n") + 1).alias("decile"),
-        )
-    )
-    kept = dec.withColumn(
-        "slot",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("s"), F.col("doc_id").cast("string"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long") % 10,
-    )
-    return kept.groupBy("decile").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("slot") == 0, 1).otherwise(0)).cast("long")
-        .alias("n_kept"),
-        F.min("doc_id").cast("long").alias("min_doc"),
-    )
-
-
-# --- padding-waste accounting under length bucketing (q315) -------------------
-
-
-@query(
-    "q315_padding_waste",
-    """WITH d AS (SELECT doc_id, len(string_split(text, ' ')) AS lw
-                  FROM documents),
-       stats AS (SELECT min(lw) AS mn, max(lw) AS mx, count(*) AS n,
-                        sum(lw) AS tok FROM d),
-       g AS (SELECT CAST(sum(s.mx - d.lw) AS BIGINT) AS waste
-             FROM d CROSS JOIN stats s),
-       bk AS (SELECT d.lw,
-                     (d.lw - s.mn) * 8 // (s.mx - s.mn + 1) AS bucket
-              FROM d CROSS JOIN stats s),
-       bmax AS (SELECT bucket, max(lw) AS bmx FROM bk GROUP BY bucket),
-       b8 AS (SELECT CAST(sum(bmax.bmx - bk.lw) AS BIGINT) AS waste
-              FROM bk JOIN bmax USING (bucket))
-       SELECT s.strategy, st.tok AS total_tokens, s.waste,
-              CAST(st.tok + s.waste AS BIGINT) AS padded_tokens
-       FROM (SELECT 'global_max' AS strategy, waste FROM g
-             UNION ALL
-             SELECT 'equal_width_8', waste FROM b8) s
-       CROSS JOIN (SELECT CAST(sum(lw) AS BIGINT) AS tok FROM d) st""",
-)
-def q315(spark, sf_dir):
-    """Padding-waste accounting under length bucketing — the training
-    throughput question (padding tokens burn FLOPs): total padding
-    under (a) one global max-length batch shape vs (b) 8 equal-width
-    length buckets each padded to its own max.  All exact integers:
-    waste = sum(bucket_max - len); bucket = (len-min)*8 div span.
-    Two scans + a bucket-max broadcast — the accounting that justifies
-    the q93 length-sorted packing operator (which this query brackets
-    from above)."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", F.size(F.split("text", " ")).alias("lw"))
-    stats = d.agg(
-        F.min("lw").alias("mn"), F.max("lw").alias("mx"),
-        F.count("*").alias("n"), F.sum("lw").alias("tok"),
-    )
-    g = d.crossJoin(F.broadcast(stats)).agg(
-        F.sum(F.col("mx") - F.col("lw")).cast("long").alias("waste"))
-    bk = d.crossJoin(F.broadcast(stats)).select(
-        "lw",
-        F.expr("(lw - mn) * 8 div (mx - mn + 1)").alias("bucket"),
-    )
-    bmax = bk.groupBy("bucket").agg(F.max("lw").alias("bmx"))
-    b8 = bk.join(F.broadcast(bmax), "bucket").agg(
-        F.sum(F.col("bmx") - F.col("lw")).cast("long").alias("waste"))
-    tok = d.agg(F.sum("lw").cast("long").alias("tok"))
-    out = (
-        g.selectExpr("'global_max' AS strategy", "waste")
-        .unionAll(b8.selectExpr("'equal_width_8' AS strategy", "waste"))
-    )
-    return out.crossJoin(F.broadcast(tok)).select(
-        "strategy",
-        F.col("tok").alias("total_tokens"),
-        F.col("waste").cast("long").alias("waste"),
-        (F.col("tok") + F.col("waste")).cast("long")
-        .alias("padded_tokens"),
-    )
-
-
-# --- ordered conversion funnel (q316) -----------------------------------------
-
-
-@query(
-    "q316_conversion_funnel",
-    """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
-                  WHERE event_type = 'view' GROUP BY user_id),
-       c AS (SELECT e.user_id, min(e.ts) AS t_click
-             FROM events e JOIN v ON v.user_id = e.user_id
-             WHERE e.event_type = 'click' AND e.ts > v.t_view
-             GROUP BY e.user_id),
-       p AS (SELECT e.user_id, min(e.ts) AS t_buy
-             FROM events e JOIN c ON c.user_id = e.user_id
-             WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-             GROUP BY e.user_id),
-       u AS (SELECT count(DISTINCT user_id) AS n FROM events)
-       SELECT CAST(u.n AS BIGINT) AS n_users,
-              CAST((SELECT count(*) FROM v) AS BIGINT) AS n_view,
-              CAST((SELECT count(*) FROM c) AS BIGINT)
-                AS n_click_after_view,
-              CAST((SELECT count(*) FROM p) AS BIGINT)
-                AS n_purchase_after_click
-       FROM u""",
-)
-def q316(spark, sf_dir):
-    """Ordered conversion funnel (view -> click-after-view ->
-    purchase-after-click) — the product-analytics stage count with
-    STRICT event ordering, not mere co-occurrence: each stage is a
-    min-timestamp aggregation joined to the previous stage with a
-    ts-after residual.  Three user-keyed aggregations + equi-joins —
-    at clickstream scale everything shuffles once on user_id and the
-    funnel is a map-side-combinable min per stage (no window, no
-    per-user sort)."""
-    e = _t(spark, sf_dir, "events")
-    v = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id").agg(F.min("ts").alias("t_view"))
-    )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id").agg(F.min("ts").alias("t_click"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id").agg(F.min("ts").alias("t_buy"))
-    )
-    nu = e.agg(F.countDistinct("user_id").alias("n"))
-    nv = v.agg(F.count("*").alias("nv"))
-    nc = c.agg(F.count("*").alias("nc"))
-    np_ = p.agg(F.count("*").alias("np"))
-    return (
-        nu.crossJoin(F.broadcast(nv)).crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(np_))
-        .select(
-            F.col("n").cast("long").alias("n_users"),
-            F.col("nv").cast("long").alias("n_view"),
-            F.col("nc").cast("long").alias("n_click_after_view"),
-            F.col("np").cast("long").alias("n_purchase_after_click"),
-        )
-    )
-
-
-# --- retention cohort matrix (q317) -------------------------------------------
-
-
-@query(
-    "q317_retention_cohorts",
-    """WITH e AS (SELECT user_id,
-                    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d
-                  FROM events),
-       first AS (SELECT user_id, min(d) AS cohort FROM e
-                 GROUP BY user_id),
-       act AS (SELECT DISTINCT e.user_id, first.cohort,
-                      e.d - first.cohort AS offs
-               FROM e JOIN first USING (user_id))
-       SELECT cohort, offs,
-              CAST(count(*) AS BIGINT) AS n_active
-       FROM act WHERE offs <= 7
-       GROUP BY cohort, offs""",
-)
-def q317(spark, sf_dir):
-    """Retention cohort matrix — users grouped by their first-seen
-    epoch day, counted as active per day offset (0..7): the
-    engagement table every growth dashboard draws.  Epoch-day
-    integers (floor(epoch)/86400, the q10 idiom) keep both engines
-    bit-identical; the matrix is one distinct + one count keyed on
-    (cohort, offset).  first-seen is a user-keyed min — at
-    clickstream scale the cohort join broadcasts the (small) first
-    table per user shard."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("CAST(unix_timestamp(ts) div 86400 AS BIGINT)").alias("d"),
-    )
-    first = e.groupBy("user_id").agg(F.min("d").alias("cohort"))
-    act = (
-        e.join(first, "user_id")
-        .select("user_id", "cohort", (F.col("d") - F.col("cohort")).alias("offs"))
-        .distinct()
-    )
-    return (
-        act.filter(F.col("offs") <= 7)
-        .groupBy("cohort", "offs")
-        .agg(F.count("*").cast("long").alias("n_active"))
-    )
-
-
-# --- crawl/index/serve Venn audit (q318) --------------------------------------
-
-
-@query(
-    "q318_crawl_index_venn",
-    """WITH u AS (SELECT doc_id, 'u' || CAST(doc_id AS VARCHAR) AS url
-                  FROM documents),
-       crawled AS (SELECT url FROM u WHERE doc_id % 3 <> 2),
-       indexed AS (SELECT url FROM u WHERE doc_id % 4 <> 3
-                     AND doc_id % 3 <> 2),
-       sitemap AS (SELECT url FROM u WHERE doc_id % 2 = 0),
-       m AS (SELECT u.url,
-                    CASE WHEN c.url IS NOT NULL THEN 1 ELSE 0 END AS fc,
-                    CASE WHEN i.url IS NOT NULL THEN 1 ELSE 0 END AS fi,
-                    CASE WHEN s.url IS NOT NULL THEN 1 ELSE 0 END AS fs
-             FROM u LEFT JOIN crawled c ON c.url = u.url
-                    LEFT JOIN indexed i ON i.url = u.url
-                    LEFT JOIN sitemap s ON s.url = u.url)
-       SELECT fc AS crawled, fi AS indexed, fs AS in_sitemap,
-              CAST(count(*) AS BIGINT) AS n
-       FROM m GROUP BY fc, fi, fs""",
-)
-def q318(spark, sf_dir):
-    """Crawl / index / sitemap Venn audit — the coverage
-    reconciliation every search pipeline runs (sitemap-but-never-
-    crawled = discovery gap; crawled-but-not-indexed = quality drop;
-    indexed-but-not-in-sitemap = organic discovery): all 8 Venn
-    cells from ONE pass of membership flags and a single aggregation
-    — the q250 fused-membership lesson applied as its own operator
-    (three .count()s on overlapping chains would re-execute the
-    chains three times and still not give the cross cells)."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        "doc_id",
-        F.concat(F.lit("u"), F.col("doc_id").cast("string")).alias("url"),
-    )
-    m = u.select(
-        "url",
-        F.when(F.col("doc_id") % 3 != 2, 1).otherwise(0).alias("fc"),
-        F.when((F.col("doc_id") % 4 != 3) & (F.col("doc_id") % 3 != 2), 1)
-        .otherwise(0).alias("fi"),
-        F.when(F.col("doc_id") % 2 == 0, 1).otherwise(0).alias("fs"),
-    )
-    return m.groupBy(
-        F.col("fc").cast("long").alias("crawled"),
-        F.col("fi").cast("long").alias("indexed"),
-        F.col("fs").cast("long").alias("in_sitemap"),
-    ).agg(F.count("*").cast("long").alias("n"))
-
-
-# --- seasonal-baseline outlier flags (q319) -----------------------------------
-
-
-@query(
-    "q319_seasonal_outliers",
-    """WITH e AS (SELECT event_type,
-                    CAST(floor(epoch(ts)) AS BIGINT) // 3600 % 24 AS hod,
-                    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d
-                  FROM events),
-       cell AS (SELECT event_type, hod, d, count(*) AS c
-                FROM e GROUP BY event_type, hod, d),
-       base AS (SELECT event_type, hod, sum(c) AS tot,
-                       count(*) AS n_days
-                FROM cell GROUP BY event_type, hod)
-       SELECT cell.event_type, cell.hod, cell.d,
-              CAST(cell.c AS BIGINT) AS n,
-              CAST(base.tot AS BIGINT) AS hod_total,
-              CAST(base.n_days AS BIGINT) AS n_days,
-              CAST(CASE WHEN 2 * cell.c * base.n_days >= 3 * base.tot
-                        THEN 1 ELSE 0 END AS BIGINT) AS is_high
-       FROM cell JOIN base USING (event_type, hod)""",
-)
-def q319(spark, sf_dir):
-    """Seasonal-baseline outlier flags — the rate-monitoring pass
-    with a DIURNAL baseline (each (type, hour-of-day) slot gets its
-    own expectation, so a nightly batch spike isn't compared to the
-    daily mean): a (type, hod, day) cell is high when its count
-    exceeds 1.5x the slot's per-day average, tested exactly as
-    2*c*n_days >= 3*tot.  Epoch-hour/day integers; two combinable
-    aggregations + one broadcast baseline join — the same shape as
-    q306 with a finer conditioning key."""
-    e = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("CAST(unix_timestamp(ts) div 3600 % 24 AS BIGINT)")
-        .alias("hod"),
-        F.expr("CAST(unix_timestamp(ts) div 86400 AS BIGINT)").alias("d"),
-    )
-    cell = e.groupBy("event_type", "hod", "d").agg(
-        F.count("*").alias("c"))
-    base = cell.groupBy("event_type", "hod").agg(
-        F.sum("c").alias("tot"), F.count("*").alias("n_days"))
-    return cell.join(F.broadcast(base), ["event_type", "hod"]).select(
-        "event_type", "hod", "d",
-        F.col("c").cast("long").alias("n"),
-        F.col("tot").cast("long").alias("hod_total"),
-        F.col("n_days").cast("long").alias("n_days"),
-        F.when(2 * F.col("c") * F.col("n_days") >= 3 * F.col("tot"), 1)
-        .otherwise(0).cast("long").alias("is_high"),
-    )
-
-
-# --- readability gate (q320) --------------------------------------------------
-
-
-@query(
-    "q320_readability_gate",
-    """SELECT doc_id,
-              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-              CAST(len(regexp_extract_all(text, '[aeiou]+')) AS BIGINT)
-                AS n_syl,
-              CAST(CASE WHEN 10 * len(regexp_extract_all(text, '[aeiou]+'))
-                             >= 14 * len(string_split(text, ' '))
-                        THEN 1 ELSE 0 END AS BIGINT) AS is_hard
-       FROM documents""",
-)
-def q320(spark, sf_dir):
-    """Readability gate — the Flesch-style complexity feature for
-    quality filtering, with the syllable count proxied by VOWEL RUNS
-    (regexp '[aeiou]+' — the standard cheap approximation) and the
-    hardness class decided by exact cross-multiplication
-    10*syllables >= 14*words (avg >= 1.4 vowel runs/word — the
-    fixture's ratio spans 1.08..1.70 so both branches fire).  One
-    regexp + one split per row, zero shuffle, scan-speed at any
-    corpus size; both branches fire on the fixture vocabulary (short
-    words like 'the'/'key' vs 'customer'/'window')."""
-    docs = _t(spark, sf_dir, "documents")
-    syl = F.size(F.expr("regexp_extract_all(text, '[aeiou]+', 0)"))
-    words = F.size(F.split("text", " "))
-    return docs.select(
-        "doc_id",
-        words.cast("long").alias("n_words"),
-        syl.cast("long").alias("n_syl"),
-        F.when(10 * syl >= 14 * words, 1).otherwise(0).cast("long")
-        .alias("is_hard"),
-    )
-
-
-# --- bot detection by inter-arrival regularity (q321) -------------------------
-
-
-@query(
-    "q321_bot_regularity",
-    """WITH real_e AS (SELECT user_id,
-                         CAST(floor(epoch(ts)) AS BIGINT) AS es
-                       FROM events),
-       bots AS (SELECT 900 + (b.range % 5) AS user_id,
-                       1704067200 + (b.range // 5) * 300
-                         + (b.range % 5) * 7 AS es
-                FROM range(0, 250) b),
-       allev AS (SELECT user_id, es FROM real_e
-                 UNION ALL SELECT user_id, es FROM bots),
-       g AS (SELECT user_id, es,
-                    lag(es) OVER (PARTITION BY user_id ORDER BY es)
-                      AS prev
-             FROM allev),
-       gaps AS (SELECT user_id, es - prev AS gap FROM g
-                WHERE prev IS NOT NULL),
-       agg AS (SELECT user_id, count(*) AS n,
-                      sum(gap) AS sg, sum(gap*gap) AS sg2
-               FROM gaps GROUP BY user_id)
-       SELECT user_id, CAST(n AS BIGINT) AS n_gaps,
-              CAST(sg AS BIGINT) AS sum_gap,
-              CAST(n * sg2 - sg * sg AS BIGINT) AS var_num,
-              CAST(CASE WHEN n >= 10
-                         AND 100 * (n * sg2 - sg * sg) <= sg * sg
-                        THEN 1 ELSE 0 END AS BIGINT) AS is_bot
-       FROM agg""",
-)
-def q321(spark, sf_dir):
-    """Bot detection by inter-arrival REGULARITY — humans are
-    bursty, schedulers are metronomes: per user, the squared
-    coefficient of variation of event gaps, computed from exact
-    integer moments (n*sum(g^2) - sum(g)^2 over epoch-second gaps)
-    and thresholded by cross-multiplication (CV^2 <= 1/100 with
-    >= 10 gaps flags a bot).  Five synthetic metronome users
-    (300s-spaced streams) ride along so both branches fire; the lag
-    window is user-sharded (the q10 sessionize shape).  At
-    clickstream scale this is the standard per-entity behavioral
-    feature: one shuffle on user_id."""
-    real_e = _t(spark, sf_dir, "events").select(
-        "user_id", F.unix_timestamp("ts").alias("es"))
-    bots = spark.range(0, 250).selectExpr(
-        "900 + (id % 5) AS user_id",
-        "1704067200 + (id div 5) * 300 + (id % 5) * 7 AS es",
-    )
-    allev = real_e.unionByName(bots)
-    w = Window.partitionBy("user_id").orderBy("es")
-    gaps = (
-        allev.withColumn("prev", F.lag("es").over(w))
-        .filter(F.col("prev").isNotNull())
-        .select("user_id", (F.col("es") - F.col("prev")).alias("gap"))
-    )
-    agg = gaps.groupBy("user_id").agg(
-        F.count("*").alias("n"),
-        F.sum("gap").alias("sg"),
-        F.sum(F.col("gap") * F.col("gap")).alias("sg2"),
-    )
-    return agg.select(
-        "user_id",
-        F.col("n").cast("long").alias("n_gaps"),
-        F.col("sg").cast("long").alias("sum_gap"),
-        (F.col("n") * F.col("sg2") - F.col("sg") * F.col("sg"))
-        .cast("long").alias("var_num"),
-        F.when(
-            (F.col("n") >= 10)
-            & (100 * (F.col("n") * F.col("sg2") - F.col("sg") * F.col("sg"))
-               <= F.col("sg") * F.col("sg")),
-            1,
-        ).otherwise(0).cast("long").alias("is_bot"),
-    )
-
-
-# --- entity resolution with blocking (q322) -----------------------------------
-
-
-@query(
-    "q322_entity_resolution",
-    """WITH a AS (SELECT doc_id AS aid,
-                    'user' || CAST(doc_id AS VARCHAR) AS name,
-                    string_split(text, ' ')[1] AS city
-                  FROM documents),
-       b AS (SELECT doc_id + 100000 AS bid,
-                    CASE WHEN doc_id % 3 = 0 THEN
-                      substr('user' || CAST(doc_id AS VARCHAR), 1, 2) ||
-                      substr('user' || CAST(doc_id AS VARCHAR), 4,
-                             length('user' || CAST(doc_id AS VARCHAR)) - 3)
-                    ELSE 'user' || CAST(doc_id AS VARCHAR) END AS name,
-                    string_split(text, ' ')[1] AS city,
-                    doc_id AS truth
-             FROM documents),
-       cand AS (SELECT a.aid, b.bid, b.truth,
-                       CASE WHEN a.name = b.name THEN 5 ELSE 0 END
-                       + CASE WHEN a.city = b.city THEN 3 ELSE 0 END
-                       + CASE WHEN abs(length(a.name) - length(b.name))
-                              <= 1 THEN 1 ELSE 0 END AS score
-                FROM a JOIN b
-                  ON substr(a.name, 1, 3) = substr(b.name, 1, 3)
-                 AND abs(a.aid % 40 - (b.bid - 100000) % 40) = 0)
-       SELECT aid, bid, CAST(score AS BIGINT) AS score,
-              CAST(CASE WHEN score >= 4 THEN 1 ELSE 0 END AS BIGINT)
-                AS is_match,
-              CAST(CASE WHEN truth = aid THEN 1 ELSE 0 END AS BIGINT)
-                AS is_true_pair
-       FROM cand WHERE score >= 2""",
-)
-def q322(spark, sf_dir):
-    """Entity resolution with BLOCKING (Fellegi-Sunter-style
-    integer agreement scoring): record set B is A with a planted
-    char-dropped name typo on every third record; candidate pairs
-    come only from a blocking join (3-char name prefix + a
-    deterministic block residual), NEVER the full cross — the
-    classic linkage shape whose cost is sum(block^2); the match
-    score is the exact integer sum of field-agreement weights
-    (name=5, city=3, length-within-1=1), match at >= 4, and the
-    planted ground truth rides along so precision/recall are
-    computable downstream.  Typo'd records keep city agreement +
-    length tolerance (score 4) — found WITHOUT exact name equality."""
-    docs = _t(spark, sf_dir, "documents")
-    a = docs.selectExpr(
-        "doc_id AS aid",
-        "concat('user', CAST(doc_id AS STRING)) AS name",
-        "split(text, ' ')[0] AS city",
-    )
-    b = docs.selectExpr(
-        "doc_id + 100000 AS bid",
-        """CASE WHEN doc_id % 3 = 0 THEN
-             concat(substring(concat('user', CAST(doc_id AS STRING)), 1, 2),
-                    substring(concat('user', CAST(doc_id AS STRING)), 4,
-                      length(concat('user', CAST(doc_id AS STRING))) - 3))
-           ELSE concat('user', CAST(doc_id AS STRING)) END AS name""",
-        "split(text, ' ')[0] AS city",
-        "doc_id AS truth",
-    )
-    cand = (
-        a.join(
-            b,
-            (F.substring(a.name, 1, 3) == F.substring(b.name, 1, 3))
-            & (F.abs(F.col("aid") % 40 - (F.col("bid") - 100000) % 40)
-               == 0),
-        )
-        .select(
-            "aid", "bid", "truth",
-            (
-                F.when(a.name == b.name, 5).otherwise(0)
-                + F.when(a.city == b.city, 3).otherwise(0)
-                + F.when(
-                    F.abs(F.length(a.name) - F.length(b.name)) <= 1, 1
-                ).otherwise(0)
-            ).alias("score"),
-        )
-    )
-    return cand.filter(F.col("score") >= 2).select(
-        "aid", "bid",
-        F.col("score").cast("long").alias("score"),
-        F.when(F.col("score") >= 4, 1).otherwise(0).cast("long")
-        .alias("is_match"),
-        F.when(F.col("truth") == F.col("aid"), 1).otherwise(0)
-        .cast("long").alias("is_true_pair"),
-    )
-
-
-# --- host boilerplate-template (soft-404) detection (q323) --------------------
-
-
-@query(
-    "q323_host_template_detection",
-    """WITH d AS (SELECT doc_id, doc_id % 20 AS host,
-                    CASE WHEN doc_id % 20 < 8 AND (doc_id // 20) % 5 < 2
-                         THEN 'page not found error template'
-                         ELSE array_to_string(
-                           string_split(text, ' ')[1:8], ' ') END
-                      AS prefix8
-                  FROM documents),
-       grp AS (SELECT host, prefix8, count(*) AS c FROM d
-               GROUP BY host, prefix8),
-       agg AS (SELECT host, max(c) AS max_grp, sum(c) AS n_docs,
-                      count(*) AS n_prefixes
-               FROM grp GROUP BY host)
-       SELECT host,
-              CAST(n_docs AS BIGINT) AS n_docs,
-              CAST(n_prefixes AS BIGINT) AS n_prefixes,
-              CAST(max_grp AS BIGINT) AS max_template_grp,
-              CAST(CASE WHEN 5 * max_grp >= n_docs THEN 1 ELSE 0 END
-                AS BIGINT) AS is_templated
-       FROM agg""",
-)
-def q323(spark, sf_dir):
-    """Host boilerplate-template (soft-404) detection — a host where
-    many URLs open with the SAME first-8-words prefix is serving an
-    error/placeholder template under 200-OK (the crawl-waste soft-404
-    case): per host, the largest identical-prefix group vs doc count,
-    templated when >= 20% share (5*max_grp >= n_docs exact).  A
-    planted 'page not found' template on hosts 0-7 (2 of every 5
-    doc_id-div-20 slots, so it VARIES within each host) fires the
-    flag there and nowhere else.  One (host, prefix)
-    groupBy + one host rollup — the per-host template screen that
-    runs next to q304's URL-alias detector."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", (F.col("doc_id") % 20).alias("host"),
-        F.when(
-            (F.col("doc_id") % 20 < 8)
-            & (F.expr("doc_id div 20") % 5 < 2),
-            F.lit("page not found error template"),
-        ).otherwise(
-            F.array_join(F.slice(F.split("text", " "), 1, 8), " ")
-        ).alias("prefix8"),
-    )
-    grp = d.groupBy("host", "prefix8").agg(F.count("*").alias("c"))
-    agg = grp.groupBy("host").agg(
-        F.max("c").alias("max_grp"), F.sum("c").alias("n_docs"),
-        F.count("*").alias("n_prefixes"),
-    )
-    return agg.select(
-        "host",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_prefixes").cast("long").alias("n_prefixes"),
-        F.col("max_grp").cast("long").alias("max_template_grp"),
-        F.when(5 * F.col("max_grp") >= F.col("n_docs"), 1).otherwise(0)
-        .cast("long").alias("is_templated"),
-    )
-
-
-# --- first-order Markov transition matrix (q324) ------------------------------
-
-
-@query(
-    "q324_markov_transitions",
-    """WITH g AS (SELECT user_id, event_type,
-                    lag(event_type) OVER
-                      (PARTITION BY user_id ORDER BY ts, event_id)
-                      AS prev
-             FROM events),
-       t AS (SELECT prev, event_type AS curr, count(*) AS c FROM g
-             WHERE prev IS NOT NULL GROUP BY prev, curr),
-       r AS (SELECT prev, sum(c) AS rt FROM t GROUP BY prev)
-       SELECT t.prev, t.curr,
-              CAST(t.c AS BIGINT) AS n,
-              CAST(r.rt AS BIGINT) AS from_total,
-              CAST(t.c AS DOUBLE) / CAST(r.rt AS DOUBLE) AS p
-       FROM t JOIN r USING (prev)""",
-)
-def q324(spark, sf_dir):
-    """First-order Markov transition matrix over per-user event
-    sequences — the behavioral model behind next-action prediction
-    and funnel leak analysis: transitions from the user-sharded lag
-    window (ordered by ts then event_id for determinism, the q10
-    idiom), counted per (prev, curr) pair, with the row-conditional
-    probability as ONE division over exact integers.  5x5 output at
-    any clickstream volume; the only shuffle is user-keyed then
-    pair-keyed."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    g = e.withColumn("prev", F.lag("event_type").over(w))
-    t = (
-        g.filter(F.col("prev").isNotNull())
-        .groupBy("prev", F.col("event_type").alias("curr"))
-        .agg(F.count("*").alias("c"))
-    )
-    r = t.groupBy("prev").agg(F.sum("c").alias("rt"))
-    return t.join(F.broadcast(r), "prev").select(
-        "prev", "curr",
-        F.col("c").cast("long").alias("n"),
-        F.col("rt").cast("long").alias("from_total"),
-        (F.col("c").cast("double") / F.col("rt").cast("double"))
-        .alias("p"),
-    )
-
-
-# --- co-visitation recommendations (q325) -------------------------------------
-
-
-@query(
-    "q325_covisitation_recs",
-    """WITH ev AS (SELECT user_id,
-                     CAST(regexp_extract(props, '([0-9]+)', 1) AS BIGINT)
-                       AS item
-                   FROM events),
-       ui AS (SELECT DISTINCT user_id, item FROM ev),
-       pr AS (SELECT a.item AS x, b.item AS y, count(*) AS c
-              FROM ui a JOIN ui b
-                ON a.user_id = b.user_id AND a.item <> b.item
-              GROUP BY a.item, b.item),
-       m AS (SELECT x, max(c) AS mc, sum(c) AS cov_total,
-                    count(*) AS n_coitems
-             FROM pr GROUP BY x),
-       top AS (SELECT pr.x, min(pr.y) AS rec
-               FROM pr JOIN m ON m.x = pr.x AND pr.c = m.mc
-               GROUP BY pr.x)
-       SELECT m.x AS item, top.rec,
-              CAST(m.mc AS BIGINT) AS rec_count,
-              CAST(m.n_coitems AS BIGINT) AS n_coitems,
-              CAST(m.cov_total AS BIGINT) AS cov_total
-       FROM m JOIN top ON top.x = m.x""",
-)
-def q325(spark, sf_dir):
-    """Item co-visitation recommendations ('users who touched X also
-    touched Y') — the classic recsys candidate generator: items
-    parsed out of the JSON props column (cross-engine regexp), the
-    distinct user-item table self-joined on user (candidate volume
-    sum(per-user items^2) — per-user bounded, never item^2), and the
-    top recommendation per item by the (count desc, item asc) argmax
-    (max-count then min-item, two bounded aggregations).  At
-    clickstream scale the user self-join is THE co-visitation
-    shuffle; hot users get capped upstream (the q19 df-cap lesson
-    applies to power users)."""
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.regexp_extract("props", "([0-9]+)", 1).cast("long")
-        .alias("item"),
-    )
-    ui = ev.distinct()
-    b = ui.selectExpr("user_id", "item AS y")
-    pr = (
-        ui.join(b, "user_id")
-        .filter(F.col("item") != F.col("y"))
-        .groupBy(F.col("item").alias("x"), "y")
-        .agg(F.count("*").alias("c"))
-    )
-    m = pr.groupBy("x").agg(
-        F.max("c").alias("mc"), F.sum("c").alias("cov_total"),
-        F.count("*").alias("n_coitems"),
-    )
-    top = (
-        pr.join(m, "x").filter(F.col("c") == F.col("mc"))
-        .groupBy("x").agg(F.min("y").alias("rec"))
-    )
-    return m.join(top, "x").select(
-        F.col("x").alias("item"), "rec",
-        F.col("mc").cast("long").alias("rec_count"),
-        F.col("n_coitems").cast("long").alias("n_coitems"),
-        F.col("cov_total").cast("long").alias("cov_total"),
-    )
-
-
-# --- PageRank vs TrustRank rank correlation (q326) ----------------------------
-
-
-@query(
-    "q326_centrality_rank_correlation",
-    """WITH hosts AS (SELECT DISTINCT doc_id % 40 AS host FROM documents),
-       edges AS (SELECT host AS src, (host + 1) % 40 AS dst FROM hosts
-                 UNION ALL SELECT host, (host * 2 + 7) % 40 FROM hosts
-                 UNION ALL SELECT host, (host * 3 + 11) % 40 FROM hosts),
-       r0 AS (SELECT host, CAST(1 AS BIGINT) AS r FROM hosts),
-       r1 AS (SELECT h.host, CAST(9 + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r0 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       r2 AS (SELECT h.host, CAST(9*60 + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN r1 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       t0 AS (SELECT host, CAST(CASE WHEN host % 10 = 0 THEN 1 ELSE 0 END
-                                AS BIGINT) AS r FROM hosts),
-       t1 AS (SELECT h.host,
-                     CAST(CASE WHEN h.host % 10 = 0 THEN 9 ELSE 0 END
-                          + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN t0 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       t2 AS (SELECT h.host,
-                     CAST(CASE WHEN h.host % 10 = 0 THEN 9*60 ELSE 0 END
-                          + coalesce(s.s, 0) AS BIGINT) AS r
-              FROM hosts h LEFT JOIN
-                   (SELECT e.dst AS host, sum(17 * r.r) AS s
-                    FROM edges e JOIN t1 r ON e.src = r.host
-                    GROUP BY e.dst) s USING (host)),
-       pra AS (SELECT a.host,
-                      (SELECT count(*) FROM r2 b
-                       WHERE b.r > a.r
-                          OR (b.r = a.r AND b.host < a.host)) + 1 AS rnk
-               FROM r2 a),
-       trb AS (SELECT a.host,
-                      (SELECT count(*) FROM t2 b
-                       WHERE b.r > a.r
-                          OR (b.r = a.r AND b.host < a.host)) + 1 AS rnk
-               FROM t2 a),
-       dd AS (SELECT pra.host,
-                     CAST(pra.rnk AS BIGINT) AS pr_rank,
-                     CAST(trb.rnk AS BIGINT) AS tr_rank,
-                     (pra.rnk - trb.rnk) * (pra.rnk - trb.rnk) AS d2
-              FROM pra JOIN trb USING (host))
-       SELECT CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(d2) AS BIGINT) AS sum_d2,
-              1.0 - CAST(6 * sum(d2) AS DOUBLE)
-                / CAST(count(*) * (count(*) * count(*) - 1) AS DOUBLE)
-                AS spearman
-       FROM dd""",
-)
-def q326(spark, sf_dir):
-    """Spearman rank correlation between PageRank (q190's uniform
-    teleport) and TrustRank (q280's seed teleport) — the spam-audit
-    number itself: how far does trust REORDER the authority ranking
-    (rank divergence localizes link farms).  Both centralities run 2
-    exact-BIGINT rounds; ranks are total orders via the
-    count-of-greater rule with (score desc, host asc) tie-break (a
-    broadcast self-join over the 40-host table, never a global
-    window); Spearman = 1 - 6*sum(d^2)/(n(n^2-1)) with the integer
-    sums exact and ONE float division.  Composing two centralities
-    in one plan exercises the shared edge table: Catalyst reuses the
-    scan, the rank joins broadcast."""
-    docs = _t(spark, sf_dir, "documents")
-    hosts = docs.select((F.col("doc_id") % 40).alias("host")).distinct()
-    edges = hosts.select(
-        F.col("host").alias("src"),
-        F.explode(F.array(
-            (F.col("host") + 1) % 40,
-            (F.col("host") * 2 + 7) % 40,
-            (F.col("host") * 3 + 11) % 40,
-        )).alias("dst"),
-    ).localCheckpoint(eager=True)
-
-    def two_rounds(seeded):
-        seed = (F.when(F.col("host") % 10 == 0, 1).otherwise(0)
-                if seeded else F.lit(1))
-        ranks = hosts.withColumn("r", seed.cast("long"))
-        for t in range(2):
-            tele = 9 * (60 ** t)
-            contrib = (
-                edges.join(ranks, edges.src == ranks.host)
-                .groupBy("dst").agg(F.sum(F.col("r") * 17).alias("s"))
-            )
-            tele_col = (
-                F.when(hosts.host % 10 == 0, F.lit(tele)).otherwise(0)
-                if seeded else F.lit(tele)
-            )
-            ranks = (
-                hosts.join(contrib, hosts.host == contrib.dst, "left")
-                .select(
-                    hosts.host,
-                    (tele_col + F.coalesce(F.col("s"), F.lit(0)))
-                    .cast("long").alias("r"),
-                )
-            )
-        return ranks
-
-    pr2 = two_rounds(False)
-    tr2 = two_rounds(True)
-
-    def rank_of(df):
-        b = df.selectExpr("host AS bh", "r AS br")
-        return (
-            df.join(
-                F.broadcast(b),
-                (F.col("br") > F.col("r"))
-                | ((F.col("br") == F.col("r"))
-                   & (F.col("bh") < F.col("host"))),
-                "left",
-            )
-            .groupBy("host").agg((F.count("bh") + 1).alias("rnk"))
-        )
-    pra = rank_of(pr2)
-    trb = rank_of(tr2).withColumnRenamed("rnk", "trnk")
-    dd = pra.join(trb, "host").select(
-        "host", "rnk", "trnk",
-        ((F.col("rnk") - F.col("trnk"))
-         * (F.col("rnk") - F.col("trnk"))).alias("d2"),
-    )
-    return dd.agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("d2").cast("long").alias("sum_d2"),
-        (
-            F.lit(1.0)
-            - (6 * F.sum("d2")).cast("double")
-            / (F.count("*") * (F.count("*") * F.count("*") - 1))
-            .cast("double")
-        ).alias("spearman"),
-    )
-
-
 # --- autocomplete prefix table (q327) -----------------------------------------
 
 
-@query(
-    "q327_autocomplete_prefixes",
-    """WITH w AS (SELECT word, count(*) AS df FROM
-                    (SELECT unnest(string_split(text, ' ')) AS word
-                     FROM documents)
-                  GROUP BY word),
-       px AS (SELECT substr(word, 1, p.range) AS prefix, word, df
-              FROM w, range(1, 5) p
-              WHERE p.range <= length(word)),
-       m AS (SELECT prefix, max(df) AS mdf, count(*) AS n_words,
-                    sum(df) AS prefix_traffic
-             FROM px GROUP BY prefix),
-       top AS (SELECT px.prefix, min(px.word) AS completion
-               FROM px JOIN m ON m.prefix = px.prefix AND px.df = m.mdf
-               GROUP BY px.prefix)
-       SELECT m.prefix, top.completion,
-              CAST(m.mdf AS BIGINT) AS completion_df,
-              CAST(m.n_words AS BIGINT) AS n_words,
-              CAST(m.prefix_traffic AS BIGINT) AS prefix_traffic
-       FROM m JOIN top ON top.prefix = m.prefix""",
-)
-def q327(spark, sf_dir):
-    """Autocomplete prefix table — the search-frontend suggestion
-    index: every 1..4-char prefix of the lexicon maps to its
-    top completion (max corpus frequency, ties to
-    lexicographically-least word) plus the prefix's candidate count
-    and total traffic.  The prefix explosion is lexicon-bounded
-    (4 rows per word), the argmax is the two-phase max-count/min-word
-    pair of bounded aggregations — at a 10^8-term lexicon this is
-    still a lexicon-side build, never touching the corpus twice."""
-    docs = _t(spark, sf_dir, "documents")
-    w = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("word").agg(F.count("*").alias("df"))
-    )
-    px = w.select(
-        "word", "df",
-        F.explode(F.sequence(F.lit(1), F.least(F.lit(4), F.length("word"))))
-        .alias("p"),
-    ).select(
-        F.expr("substring(word, 1, CAST(p AS INT))").alias("prefix"),
-        "word", "df",
-    )
-    m = px.groupBy("prefix").agg(
-        F.max("df").alias("mdf"), F.count("*").alias("n_words"),
-        F.sum("df").alias("prefix_traffic"),
-    )
-    top = (
-        px.join(m, "prefix").filter(F.col("df") == F.col("mdf"))
-        .groupBy("prefix").agg(F.min("word").alias("completion"))
-    )
-    return m.join(top, "prefix").select(
-        "prefix", "completion",
-        F.col("mdf").cast("long").alias("completion_df"),
-        F.col("n_words").cast("long").alias("n_words"),
-        F.col("prefix_traffic").cast("long").alias("prefix_traffic"),
-    )
+# Count-Min sketch over whitespace tokens, batch SQL (oracle of q328):
+# 4 x 64 (row, col) cells and the min-over-rows point estimate.
+_CMS_ORACLE = """WITH w AS (SELECT unnest(string_split(text, ' ')) AS word
+                  FROM documents),
+       tc AS (SELECT word, count(*) AS cnt FROM w GROUP BY word),
+       cells AS (SELECT r.range AS r,
+                        CAST(CAST('0x' || substr(md5('cm' ||
+                               CAST(r.range AS VARCHAR) || ':' || word),
+                             1, 8) AS UBIGINT) % 64 AS BIGINT) AS c,
+                        word, cnt
+                 FROM tc, range(0, 4) r),
+       sk AS (SELECT r, c, sum(cnt) AS cell FROM cells GROUP BY r, c),
+       est AS (SELECT cells.word, min(sk.cell) AS cms_est
+               FROM cells JOIN sk USING (r, c) GROUP BY cells.word)
+       SELECT tc.word, CAST(tc.cnt AS BIGINT) AS true_cnt,
+              CAST(est.cms_est AS BIGINT) AS cms_est,
+              CAST(est.cms_est - tc.cnt AS BIGINT) AS overcount
+       FROM tc JOIN est USING (word)"""
 
 
 # --- streaming Count-Min sketch (q328) ----------------------------------------
 
 
-@query("q328_streaming_countmin", ORACLES["q278_countmin_sketch"])
+@query("q328_streaming_countmin", _CMS_ORACLE, kind="operator")
 def q328(spark, sf_dir):
     """STREAMING Count-Min: the q278 sketch cells maintained by a
     real Structured Streaming query (streaming/windowed.py::
@@ -18284,1389 +9669,6 @@ def q328(spark, sf_dir):
         F.col("cnt").cast("long").alias("true_cnt"),
         F.col("cms_est").cast("long").alias("cms_est"),
         (F.col("cms_est") - F.col("cnt")).cast("long").alias("overcount"),
-    )
-
-
-# --- crawl snapshot diff (q329) -----------------------------------------------
-
-
-@query(
-    "q329_crawl_snapshot_diff",
-    """WITH u AS (SELECT doc_id, doc_id % 20 AS host,
-                    'u' || CAST(doc_id AS VARCHAR) AS url,
-                    md5(CASE WHEN doc_id % 7 = 0
-                        THEN text || ' v2' ELSE text END) AS h_new,
-                    md5(text) AS h_old
-                  FROM documents),
-       m AS (SELECT host, url,
-                    CASE WHEN doc_id % 10 < 9 THEN 1 ELSE 0 END AS in_a,
-                    CASE WHEN doc_id % 10 > 0 THEN 1 ELSE 0 END AS in_b,
-                    CASE WHEN h_new <> h_old THEN 1 ELSE 0 END AS changed
-             FROM u)
-       SELECT host,
-              CAST(sum(CASE WHEN in_a = 1 AND in_b = 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_removed,
-              CAST(sum(CASE WHEN in_a = 0 AND in_b = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_added,
-              CAST(sum(CASE WHEN in_a = 1 AND in_b = 1 AND changed = 1
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-              CAST(sum(CASE WHEN in_a = 1 AND in_b = 1 AND changed = 0
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged
-       FROM m GROUP BY host""",
-)
-def q329(spark, sf_dir):
-    """Crawl snapshot diff — the crawl-cycle reconciliation (what did
-    this cycle add / drop / change per host): snapshot membership
-    flags and a content-hash change flag computed in ONE pass, then a
-    single host rollup of the four diff classes (added / removed /
-    changed / unchanged) — the q250/q318 fused-membership pattern
-    applied to snapshot reconciliation; three separate joins would
-    re-scan the snapshots and still miss the cross cells.  At
-    10^12-URL snapshots this is one scan + one host-keyed combine."""
-    docs = _t(spark, sf_dir, "documents")
-    m = docs.select(
-        (F.col("doc_id") % 20).alias("host"),
-        F.when(F.col("doc_id") % 10 < 9, 1).otherwise(0).alias("in_a"),
-        F.when(F.col("doc_id") % 10 > 0, 1).otherwise(0).alias("in_b"),
-        F.when(
-            F.md5(
-                F.when(F.col("doc_id") % 7 == 0,
-                       F.concat(F.col("text"), F.lit(" v2")))
-                .otherwise(F.col("text"))
-            ) != F.md5("text"),
-            1,
-        ).otherwise(0).alias("changed"),
-    )
-    return m.groupBy("host").agg(
-        F.sum(F.when((F.col("in_a") == 1) & (F.col("in_b") == 0), 1)
-              .otherwise(0)).cast("long").alias("n_removed"),
-        F.sum(F.when((F.col("in_a") == 0) & (F.col("in_b") == 1), 1)
-              .otherwise(0)).cast("long").alias("n_added"),
-        F.sum(F.when((F.col("in_a") == 1) & (F.col("in_b") == 1)
-                     & (F.col("changed") == 1), 1).otherwise(0))
-        .cast("long").alias("n_changed"),
-        F.sum(F.when((F.col("in_a") == 1) & (F.col("in_b") == 1)
-                     & (F.col("changed") == 0), 1).otherwise(0))
-        .cast("long").alias("n_unchanged"),
-    )
-
-
-# --- cache admission planning (q330) ------------------------------------------
-
-
-@query(
-    "q330_cache_admission_planning",
-    """WITH req AS (SELECT CAST(regexp_extract(props, '([0-9]+)', 1)
-                             AS BIGINT) AS item
-                    FROM events),
-       c AS (SELECT item, count(*) AS c FROM req GROUP BY item),
-       rk AS (SELECT a.item, a.c,
-                     (SELECT count(*) FROM c b
-                      WHERE b.c > a.c
-                         OR (b.c = a.c AND b.item < a.item)) + 1 AS rnk
-              FROM c a),
-       t AS (SELECT sum(c) AS tot FROM c)
-       SELECT k.k AS cache_k,
-              CAST(t.tot AS BIGINT) AS n_requests,
-              CAST(sum(CASE WHEN rk.rnk <= k.k THEN rk.c ELSE 0 END)
-                AS BIGINT) AS n_hits,
-              CAST(sum(CASE WHEN rk.rnk <= k.k THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_cached_items
-       FROM rk CROSS JOIN (VALUES (10), (25), (50)) k(k)
-       CROSS JOIN t
-       GROUP BY k.k, t.tot""",
-)
-def q330(spark, sf_dir):
-    """Static cache-admission planning — the CDN / result-cache
-    sizing question answered from the request histogram: if the cache
-    pins the top-k hottest items (perfect frequency admission), the
-    hit count is exactly the sum of their request counts.  Items come
-    from the JSON props field; ranks are a total order by
-    (count desc, item asc) via the count-of-greater broadcast
-    self-join over the BOUNDED item table (100 items — never a
-    window over requests); three k values in one pass.  At CDN scale
-    the histogram is the only corpus-sized aggregation."""
-    req = _t(spark, sf_dir, "events").select(
-        F.regexp_extract("props", "([0-9]+)", 1).cast("long").alias("item"))
-    c = req.groupBy("item").agg(F.count("*").alias("c"))
-    b = c.selectExpr("item AS bi", "c AS bc")
-    rk = (
-        c.join(
-            F.broadcast(b),
-            (F.col("bc") > F.col("c"))
-            | ((F.col("bc") == F.col("c")) & (F.col("bi") < F.col("item"))),
-            "left",
-        )
-        .groupBy("item", "c").agg((F.count("bi") + 1).alias("rnk"))
-    )
-    t = c.agg(F.sum("c").alias("tot"))
-    ks = spark.createDataFrame([(10,), (25,), (50,)], "k INT")
-    return (
-        rk.crossJoin(F.broadcast(ks)).crossJoin(F.broadcast(t))
-        .groupBy(F.col("k").alias("cache_k"), "tot")
-        .agg(
-            F.sum(F.when(F.col("rnk") <= F.col("k"), F.col("c"))
-                  .otherwise(0)).cast("long").alias("n_hits"),
-            F.sum(F.when(F.col("rnk") <= F.col("k"), 1).otherwise(0))
-            .cast("long").alias("n_cached_items"),
-        )
-        .select(
-            "cache_k",
-            F.col("tot").cast("long").alias("n_requests"),
-            "n_hits", "n_cached_items",
-        )
-    )
-
-
-# --- local-bridge (triangle-free) edge accounting (q331) ----------------------
-
-
-@query(
-    "q331_local_bridges",
-    """WITH h AS (SELECT DISTINCT doc_id % 60 AS hh FROM documents),
-       e0 AS (SELECT hh, unnest([1, 2, 3]) AS j FROM h),
-       ed AS (SELECT DISTINCT least(hh, (hh * j + j * j * 7) % 60) AS u,
-                     greatest(hh, (hh * j + j * j * 7) % 60) AS v
-              FROM e0 WHERE hh <> (hh * j + j * j * 7) % 60),
-       adj AS (SELECT u AS a, v AS b FROM ed
-               UNION ALL SELECT v, u FROM ed),
-       tri AS (SELECT DISTINCT e.u, e.v
-               FROM ed e JOIN adj x ON x.a = e.u
-                         JOIN adj y ON y.a = e.v AND y.b = x.b),
-       flag AS (SELECT ed.u, ed.v,
-                       CASE WHEN tri.u IS NOT NULL THEN 0 ELSE 1 END
-                         AS is_bridge
-                FROM ed LEFT JOIN tri
-                  ON tri.u = ed.u AND tri.v = ed.v)
-       SELECT u AS host,
-              CAST(count(*) AS BIGINT) AS n_edges,
-              CAST(sum(is_bridge) AS BIGINT) AS n_local_bridges
-       FROM flag GROUP BY u""",
-)
-def q331(spark, sf_dir):
-    """Local-bridge accounting — edges in NO triangle (zero common
-    neighbors) are the graph's weak ties (Granovetter): removing one
-    lengthens the path between its endpoints, so crawl schedulers
-    treat bridge-heavy hosts as fragile discovery frontiers.
-    Detection reuses the q275 wedge machinery inverted: an edge is
-    triangle-covered iff its endpoints share an adjacency row, found
-    by one two-hop equi-join, and bridges are the anti-complement —
-    work bounded by the wedge count, never node^3.  Emitted per
-    lower endpoint (host) as edge/bridge counts."""
-    docs = _t(spark, sf_dir, "documents")
-    h = docs.selectExpr("doc_id % 60 AS hh").distinct()
-    e0 = h.select(
-        "hh", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j")
-    ).selectExpr("hh", "(hh * j + j * j * 7) % 60 AS t")
-    ed = (
-        e0.filter("hh <> t")
-        .selectExpr("least(hh, t) AS u", "greatest(hh, t) AS v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    adj = ed.selectExpr("u AS a", "v AS b").unionAll(
-        ed.selectExpr("v AS a", "u AS b"))
-    x = adj.selectExpr("a AS u", "b AS w1")
-    y = adj.selectExpr("a AS v2", "b AS w2")
-    tri = (
-        ed.join(x, "u")
-        .join(y, (F.col("v") == F.col("v2"))
-                 & (F.col("w1") == F.col("w2")))
-        .select("u", "v").distinct()
-        .withColumn("_t", F.lit(1))
-    )
-    flag = ed.join(tri, ["u", "v"], "left").select(
-        "u", "v",
-        F.when(F.col("_t").isNotNull(), 0).otherwise(1).alias("is_bridge"),
-    )
-    return flag.groupBy(F.col("u").alias("host")).agg(
-        F.count("*").cast("long").alias("n_edges"),
-        F.sum("is_bridge").cast("long").alias("n_local_bridges"),
-    )
-
-
-# --- embedding cluster-health audit (q332) ------------------------------------
-
-
-@query(
-    "q332_cluster_health",
-    """WITH v AS (SELECT vec_id, label,
-                list_transform(embedding,
-                    x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                    AS qv
-             FROM embeddings),
-       ex AS (SELECT vec_id, label, i.range AS i, qv[i.range] AS q
-              FROM v, range(1, 65) i),
-       cen AS (SELECT label, i, sum(q) AS cs FROM ex GROUP BY label, i),
-       nt AS (SELECT label, count(*) AS n FROM v GROUP BY label),
-       dev AS (SELECT e.vec_id, e.label,
-                      CAST(sum(abs(e.q * nt.n - cen.cs)) AS BIGINT)
-                        AS dev_num
-               FROM ex e JOIN cen ON cen.label = e.label AND cen.i = e.i
-               JOIN nt ON nt.label = e.label
-               GROUP BY e.vec_id, e.label),
-       tot AS (SELECT label, sum(dev_num) AS sum_dev,
-                      count(*) AS n FROM dev GROUP BY label)
-       SELECT dev.label,
-              CAST(tot.n AS BIGINT) AS n_members,
-              CAST(sum(CASE WHEN dev.dev_num * tot.n >= 2 * tot.sum_dev
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-              CAST(max(dev.dev_num) AS BIGINT) AS max_dev,
-              CAST(tot.sum_dev AS BIGINT) AS sum_dev
-       FROM dev JOIN tot USING (label)
-       GROUP BY dev.label, tot.n, tot.sum_dev""",
-)
-def q332(spark, sf_dir):
-    """Embedding cluster-health audit — the drift check a labeled
-    embedding store runs (mislabeled or stale vectors sit far from
-    their class centroid): per-label integer centroid SUMS (division-
-    free — each member's L1 deviation is |qv_i*n - csum_i|, the
-    cross-multiplied distance to the mean), a member is an outlier
-    when its deviation is >= 2x the class average (dev*n >= 2*sum_dev,
-    exact).  Two label-keyed aggregations + one broadcast centroid
-    join; the 64-dim arithmetic is per-row array HOF work (linear).
-    All-integer, engine-order-free."""
-    v = _t(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id", "label",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qv",
-    )
-    ex = v.select(
-        "vec_id", "label",
-        F.posexplode("qv").alias("i", "q"),
-    )
-    cen = ex.groupBy("label", "i").agg(F.sum("q").alias("cs"))
-    cen_arr = cen.groupBy("label").agg(
-        F.expr("transform(array_sort(collect_list(struct(i, cs))), "
-               "s -> s.cs) AS csum"),
-        F.lit(None).alias("_d"),
-    ).select("label", "csum")
-    n_tab = v.groupBy("label").agg(F.count("*").alias("n"))
-    dev = (
-        v.join(F.broadcast(cen_arr), "label")
-        .join(F.broadcast(n_tab), "label")
-        .selectExpr(
-            "vec_id", "label", "n",
-            "CAST(aggregate(zip_with(qv, csum, "
-            "(a, b) -> abs(a * n - b)), CAST(0 AS BIGINT), "
-            "(acc, s) -> acc + s) AS BIGINT) AS dev_num",
-        )
-    )
-    tot = dev.groupBy("label").agg(
-        F.sum("dev_num").alias("sum_dev"), F.count("*").alias("nn"))
-    return (
-        dev.join(F.broadcast(tot), "label")
-        .groupBy("label", "nn", "sum_dev")
-        .agg(
-            F.sum(
-                F.when(F.col("dev_num") * F.col("nn")
-                       >= 2 * F.col("sum_dev"), 1).otherwise(0)
-            ).cast("long").alias("n_outliers"),
-            F.max("dev_num").cast("long").alias("max_dev"),
-        )
-        .select(
-            "label",
-            F.col("nn").cast("long").alias("n_members"),
-            "n_outliers", "max_dev",
-            F.col("sum_dev").cast("long").alias("sum_dev"),
-        )
-    )
-
-
-# --- cross-doc passage dedup accounting (q333) --------------------------------
-
-
-@query(
-    "q333_passage_dedup",
-    """WITH d AS (SELECT doc_id,
-                    CASE WHEN doc_id % 13 = 0 THEN
-                      'alpha beta gamma delta epsilon zeta eta theta iota '
-                      || 'kappa lam mu nu xi omicron pi rho sigma tau '
-                      || 'upsilon phi chi psi omega one two three four '
-                      || 'five six'
-                    ELSE text END AS body
-                  FROM documents),
-       s AS (SELECT doc_id, string_split(body, ' ') AS w FROM d),
-       p AS (SELECT doc_id, k.range AS k,
-                    substr(md5(array_to_string(
-                      w[1 + 15*k.range :
-                        least(len(w), 1 + 15*k.range + 29)], ' ')), 1, 8)
-                      AS h8
-             FROM s, range(0, 14) k
-             WHERE 1 + 15 * k.range <= len(w)),
-       dup AS (SELECT h8, count(*) AS n_occ,
-                      count(DISTINCT doc_id) AS n_docs,
-                      min(doc_id) AS keeper
-               FROM p GROUP BY h8
-               HAVING count(DISTINCT doc_id) > 1)
-       SELECT h8, CAST(n_occ AS BIGINT) AS n_occ,
-              CAST(n_docs AS BIGINT) AS n_docs,
-              CAST(keeper AS BIGINT) AS keeper
-       FROM dup""",
-)
-def q333(spark, sf_dir):
-    """Cross-document passage dedup accounting — the RAG-corpus
-    compaction pass on top of q302's chunking: passages whose md5
-    fingerprint appears in MORE THAN ONE document, with occurrence /
-    doc counts and the min-id keeper (the q17 exact-dedup contract at
-    passage granularity).  A planted 31-word body on doc_id%13==0
-    makes identical multi-chunk passages across docs at every SF.
-    One fingerprint groupBy — candidate volume is duplicate-group-
-    bounded, the same shape that dedups 10^12 passages."""
-    docs = _t(spark, sf_dir, "documents")
-    tmpl = ("alpha beta gamma delta epsilon zeta eta theta iota "
-            "kappa lam mu nu xi omicron pi rho sigma tau "
-            "upsilon phi chi psi omega one two three four five six")
-    d = docs.select(
-        "doc_id",
-        F.when(F.col("doc_id") % 13 == 0, F.lit(tmpl))
-        .otherwise(F.col("text")).alias("body"),
-    )
-    s = d.select("doc_id", F.split("body", " ").alias("w"))
-    p = (
-        s.select(
-            "doc_id", F.size("w").alias("lw"), "w",
-            F.explode(F.sequence(F.lit(0), F.lit(13))).alias("k"),
-        )
-        .filter(1 + 15 * F.col("k") <= F.col("lw"))
-        .withColumn("s0", 1 + 15 * F.col("k"))
-        .select(
-            "doc_id",
-            F.substring(
-                F.md5(F.array_join(
-                    F.expr("slice(w, s0, least(lw, s0 + 29) - s0 + 1)"),
-                    " ")),
-                1, 8,
-            ).alias("h8"),
-        )
-    )
-    return (
-        p.groupBy("h8")
-        .agg(
-            F.count("*").alias("n_occ"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.min("doc_id").alias("keeper"),
-        )
-        .filter(F.col("n_docs") > 1)
-        .select(
-            "h8",
-            F.col("n_occ").cast("long").alias("n_occ"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("keeper").cast("long").alias("keeper"),
-        )
-    )
-
-
-# --- last-touch attribution via as-of join (q334) -----------------------------
-
-
-@query(
-    "q334_last_touch_attribution",
-    """WITH clicks AS (SELECT user_id, ts,
-                         CAST(regexp_extract(props, '([0-9]+)', 1)
-                              AS BIGINT) AS item
-                       FROM events WHERE event_type = 'click'),
-       buys AS (SELECT event_id, user_id, ts FROM events
-                WHERE event_type = 'purchase'),
-       mt AS (SELECT b.event_id, b.user_id, max(c.ts) AS mts
-              FROM buys b JOIN clicks c
-                ON c.user_id = b.user_id AND c.ts < b.ts
-              GROUP BY b.event_id, b.user_id),
-       x AS (SELECT mt.event_id, max(c.item) AS item
-             FROM mt JOIN clicks c
-               ON c.user_id = mt.user_id AND c.ts = mt.mts
-             GROUP BY mt.event_id)
-       SELECT item,
-              CAST(count(*) AS BIGINT) AS n_attributed
-       FROM x GROUP BY item""",
-)
-def q334(spark, sf_dir):
-    """Last-touch attribution — the AS-OF JOIN Spark lacks natively,
-    expressed as the combinable max-struct idiom: each purchase
-    matches the LATEST prior click of the same user (max(struct(ts,
-    item)) over candidates with ts < purchase_ts — map-side
-    combinable, no window over the event stream), then attributed
-    purchases roll up per item.  The user-keyed equi-join carries
-    the shuffle; candidate fan-out is per-user bounded.  This is the
-    point-in-time enrichment shape (q253's SCD-2 lookup) driven from
-    the event side — the revenue-attribution query every analytics
-    stack runs."""
-    e = _t(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("cts"),
-        F.regexp_extract("props", "([0-9]+)", 1).cast("long").alias("item"),
-    )
-    buys = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts")
-    att = (
-        buys.join(clicks, "user_id")
-        .filter(F.col("cts") < F.col("ts"))
-        .groupBy("event_id")
-        .agg(F.max(F.struct(F.col("cts"), F.col("item"))).alias("m"))
-    )
-    return (
-        att.select(F.col("m.item").alias("item"))
-        .groupBy("item")
-        .agg(F.count("*").cast("long").alias("n_attributed"))
-    )
-
-
-# --- sliding-window distinct users (q335) -------------------------------------
-
-
-@query(
-    "q335_sliding_distinct_users",
-    """WITH e AS (SELECT user_id,
-                    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d
-                  FROM events),
-       win AS (SELECT DISTINCT e.user_id, e.d + o.range AS wend
-               FROM e, range(0, 3) o),
-       span AS (SELECT min(d) AS lo, max(d) AS hi FROM e)
-       SELECT win.wend AS window_end,
-              CAST(count(*) AS BIGINT) AS n_active_3d
-       FROM win, span
-       WHERE win.wend BETWEEN span.lo AND span.hi
-       GROUP BY win.wend""",
-)
-def q335(spark, sf_dir):
-    """Sliding 3-day-window distinct active users — the rolling MAU/
-    WAU family metric computed EXACTLY without per-window re-scans:
-    each (user, day) activation explodes to the 3 window-end days it
-    participates in, dedups, and counts — one explode + one distinct
-    + one count, all keyed on (user, window), no self-join of the
-    event table against itself per window.  At clickstream scale
-    this is the standard rolling-distinct shape (window count bounded
-    by the calendar, not the events); window ends clipped to the
-    observed day span."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("CAST(unix_timestamp(ts) div 86400 AS BIGINT)").alias("d"),
-    )
-    win = (
-        e.select(
-            "user_id", "d",
-            F.explode(F.sequence(F.lit(0), F.lit(2))).alias("o"),
-        )
-        .select("user_id", (F.col("d") + F.col("o")).alias("wend"))
-        .distinct()
-    )
-    span = e.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
-    return (
-        win.crossJoin(F.broadcast(span))
-        .filter((F.col("wend") >= F.col("lo"))
-                & (F.col("wend") <= F.col("hi")))
-        .groupBy(F.col("wend").alias("window_end"))
-        .agg(F.count("*").cast("long").alias("n_active_3d"))
-    )
-
-
-# --- time-to-convert distribution (q336) --------------------------------------
-
-
-@query(
-    "q336_time_to_convert",
-    """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
-                  WHERE event_type = 'view' GROUP BY user_id),
-       p AS (SELECT e.user_id, min(e.ts) AS t_buy
-             FROM events e JOIN v ON v.user_id = e.user_id
-             WHERE e.event_type = 'purchase' AND e.ts > v.t_view
-             GROUP BY e.user_id),
-       dt AS (SELECT p.user_id,
-                     CAST(floor(epoch(p.t_buy)) AS BIGINT)
-                       - CAST(floor(epoch(v.t_view)) AS BIGINT) AS secs
-              FROM p JOIN v USING (user_id))
-       SELECT CAST(length(bin(secs)) AS BIGINT) AS log2_bucket,
-              CAST(count(*) AS BIGINT) AS n_users,
-              CAST(min(secs) AS BIGINT) AS min_secs,
-              CAST(max(secs) AS BIGINT) AS max_secs
-       FROM dt GROUP BY length(bin(secs))""",
-)
-def q336(spark, sf_dir):
-    """Time-to-convert distribution — seconds from first view to
-    first subsequent purchase, histogrammed into power-of-two
-    buckets (the q294 log-bin sketch applied to a derived duration):
-    conversion deltas come from the q316 funnel's min-ts stages, the
-    bucket is the exact bin()-length integer, min/max per bucket
-    bound the bucket edges visibly.  Two user-keyed aggregations +
-    one join; the histogram is mergeable across shards (the property
-    that lets the metric run incrementally in the stream tier)."""
-    e = _t(spark, sf_dir, "events")
-    v = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id").agg(F.min("ts").alias("t_view"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id").agg(F.min("ts").alias("t_buy"))
-    )
-    dt = p.join(v, "user_id").select(
-        "user_id",
-        (F.unix_timestamp("t_buy") - F.unix_timestamp("t_view"))
-        .alias("secs"),
-    )
-    return dt.groupBy(
-        F.length(F.bin("secs")).cast("long").alias("log2_bucket")
-    ).agg(
-        F.count("*").cast("long").alias("n_users"),
-        F.min("secs").cast("long").alias("min_secs"),
-        F.max("secs").cast("long").alias("max_secs"),
-    )
-
-
-# --- Heaps'-law vocabulary growth (q337) --------------------------------------
-
-
-@query(
-    "q337_heaps_vocab_growth",
-    """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                  FROM documents),
-       fs AS (SELECT word, min(doc_id) AS first_doc FROM w
-              GROUP BY word),
-       ks AS (SELECT k.k FROM (VALUES (50), (100), (200), (500)) k(k))
-       SELECT ks.k AS n_docs,
-              CAST(sum(CASE WHEN fs.first_doc < ks.k THEN 1 ELSE 0 END)
-                AS BIGINT) AS vocab_size
-       FROM ks CROSS JOIN fs
-       GROUP BY ks.k""",
-)
-def q337(spark, sf_dir):
-    """Heaps'-law vocabulary growth curve — distinct vocabulary after
-    the first k documents, for four prefix sizes in ONE pass: a
-    word's first appearance is its min doc_id (map-side-combinable),
-    and each curve point is a flag-sum over the lexicon-sized
-    first-seen table — no per-prefix rescan of the corpus (the naive
-    form scans the corpus once per k).  The growth-curve shape
-    decides tokenizer vocab budgets and dedup thresholds at corpus
-    build time."""
-    docs = _t(spark, sf_dir, "documents")
-    w = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    fs = w.groupBy("word").agg(F.min("doc_id").alias("first_doc"))
-    ks = spark.createDataFrame([(50,), (100,), (200,), (500,)], "k INT")
-    return (
-        F.broadcast(ks).crossJoin(fs)
-        .groupBy(F.col("k").alias("n_docs"))
-        .agg(
-            F.sum(F.when(F.col("first_doc") < F.col("k"), 1).otherwise(0))
-            .cast("long").alias("vocab_size")
-        )
-        .select(F.col("n_docs").cast("long").alias("n_docs"), "vocab_size")
-    )
-
-
-# --- Zipf rank-frequency products (q338) --------------------------------------
-
-
-@query(
-    "q338_zipf_products",
-    """WITH w AS (SELECT word, count(*) AS f FROM
-                    (SELECT unnest(string_split(text, ' ')) AS word
-                     FROM documents)
-                  GROUP BY word),
-       rk AS (SELECT a.word, a.f,
-                     (SELECT count(*) FROM w b
-                      WHERE b.f > a.f
-                         OR (b.f = a.f AND b.word < a.word)) + 1 AS rnk
-              FROM w a)
-       SELECT CAST(rnk AS BIGINT) AS rnk, word,
-              CAST(f AS BIGINT) AS freq,
-              CAST(rnk * f AS BIGINT) AS rank_freq_product
-       FROM rk WHERE rnk <= 20""",
-)
-def q338(spark, sf_dir):
-    """Zipf rank-frequency products for the top-20 terms — the
-    classic corpus sanity check (natural language keeps rank x freq
-    roughly constant; a synthetic or boilerplate-heavy corpus shows a
-    flat head): ranks are a total order by (freq desc, word asc) via
-    the count-of-greater broadcast self-join over the BOUNDED lexicon
-    (never a window over tokens), and the product is exact integer.
-    The head shape feeds stopword-list selection and CMS sizing."""
-    docs = _t(spark, sf_dir, "documents")
-    w = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("word").agg(F.count("*").alias("f"))
-    )
-    b = w.selectExpr("word AS bw", "f AS bf")
-    rk = (
-        w.join(
-            F.broadcast(b),
-            (F.col("bf") > F.col("f"))
-            | ((F.col("bf") == F.col("f")) & (F.col("bw") < F.col("word"))),
-            "left",
-        )
-        .groupBy("word", "f").agg((F.count("bw") + 1).alias("rnk"))
-    )
-    return rk.filter(F.col("rnk") <= 20).select(
-        F.col("rnk").cast("long").alias("rnk"), "word",
-        F.col("f").cast("long").alias("freq"),
-        (F.col("rnk") * F.col("f")).cast("long")
-        .alias("rank_freq_product"),
-    )
-
-
-# --- vocabulary-size / OOV tradeoff (q339) ------------------------------------
-
-
-@query(
-    "q339_vocab_oov_tradeoff",
-    """WITH w AS (SELECT word, count(*) AS f FROM
-                    (SELECT unnest(string_split(text, ' ')) AS word
-                     FROM documents)
-                  GROUP BY word),
-       rk AS (SELECT a.word, a.f,
-                     (SELECT count(*) FROM w b
-                      WHERE b.f > a.f
-                         OR (b.f = a.f AND b.word < a.word)) + 1 AS rnk
-              FROM w a),
-       t AS (SELECT sum(f) AS tot FROM w),
-       ks AS (SELECT k.k FROM (VALUES (5), (10), (20), (31)) k(k))
-       SELECT ks.k AS vocab_k,
-              CAST(t.tot AS BIGINT) AS n_tokens,
-              CAST(sum(CASE WHEN rk.rnk <= ks.k THEN rk.f ELSE 0 END)
-                AS BIGINT) AS covered,
-              CAST(t.tot - sum(CASE WHEN rk.rnk <= ks.k THEN rk.f
-                               ELSE 0 END) AS BIGINT) AS oov_tokens
-       FROM ks CROSS JOIN rk CROSS JOIN t
-       GROUP BY ks.k, t.tot""",
-)
-def q339(spark, sf_dir):
-    """Vocabulary-size / OOV tradeoff curve — the tokenizer budget
-    decision (how many tokens does a top-k vocabulary leave out-of-
-    vocabulary): coverage per k is a flag-sum over the ranked lexicon
-    (count-of-greater total order, the q338 rank table reused), four
-    k points in one pass.  OOV drives the byte-fallback rate of a
-    BPE vocab and the UNK rate of a word vocab — this curve is the
-    capacity plan for both."""
-    docs = _t(spark, sf_dir, "documents")
-    w = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("word").agg(F.count("*").alias("f"))
-    )
-    b = w.selectExpr("word AS bw", "f AS bf")
-    rk = (
-        w.join(
-            F.broadcast(b),
-            (F.col("bf") > F.col("f"))
-            | ((F.col("bf") == F.col("f")) & (F.col("bw") < F.col("word"))),
-            "left",
-        )
-        .groupBy("word", "f").agg((F.count("bw") + 1).alias("rnk"))
-    )
-    t = w.agg(F.sum("f").alias("tot"))
-    ks = spark.createDataFrame([(5,), (10,), (20,), (31,)], "k INT")
-    return (
-        F.broadcast(ks).crossJoin(rk).crossJoin(F.broadcast(t))
-        .groupBy(F.col("k").alias("vocab_k"), "tot")
-        .agg(
-            F.sum(F.when(F.col("rnk") <= F.col("k"), F.col("f"))
-                  .otherwise(0)).cast("long").alias("covered"),
-        )
-        .select(
-            F.col("vocab_k").cast("long").alias("vocab_k"),
-            F.col("tot").cast("long").alias("n_tokens"),
-            "covered",
-            (F.col("tot") - F.col("covered")).cast("long")
-            .alias("oov_tokens"),
-        )
-    )
-
-
-# --- language geography per tile (q340) ---------------------------------------
-
-
-@query(
-    "q340_language_geography",
-    f"""WITH pts AS ({POINTS_SQL}),
-       g AS (SELECT p.doc_id,
-                    CAST(floor((p.lon + 180)/360.0*16) AS BIGINT) AS tx,
-                    CAST(floor((90 - p.lat)/180.0*16) AS BIGINT) AS ty,
-                    d.lang
-             FROM pts p JOIN documents d USING (doc_id)),
-       c AS (SELECT tx, ty, lang, count(*) AS c FROM g
-             GROUP BY tx, ty, lang),
-       m AS (SELECT tx, ty, max(c) AS mc, sum(c) AS n_docs,
-                    count(*) AS n_langs
-             FROM c GROUP BY tx, ty),
-       top AS (SELECT c.tx, c.ty, min(c.lang) AS dominant_lang
-               FROM c JOIN m ON m.tx = c.tx AND m.ty = c.ty
-                            AND c.c = m.mc
-               GROUP BY c.tx, c.ty)
-       SELECT m.tx, m.ty,
-              CAST(m.n_docs AS BIGINT) AS n_docs,
-              CAST(m.n_langs AS BIGINT) AS n_langs,
-              top.dominant_lang,
-              CAST(m.mc AS BIGINT) AS dominant_cnt
-       FROM m JOIN top ON top.tx = m.tx AND top.ty = m.ty""",
-)
-def q340(spark, sf_dir):
-    """Language geography — the geospatial x webtext fusion tile map
-    (which language dominates each z4 tile of the geocoded corpus):
-    the doc-keyed synthetic geocode (the q16 fixture) joins the
-    documents' lang column, tiles by the exact floor expression both
-    engines share, and the dominant language per tile is the
-    max-count/lex-min two-phase argmax.  This is the per-tile rollup
-    a multilingual crawl uses to steer regional fetch capacity; one
-    (tile, lang) groupBy + one tile rollup, the q14 density shape
-    with an argmax on top."""
-    pts = _points(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    g = pts.join(docs, "doc_id").select(
-        F.floor((F.col("lon") + 180) / 360.0 * 16).cast("long").alias("tx"),
-        F.floor((90 - F.col("lat")) / 180.0 * 16).cast("long").alias("ty"),
-        "lang",
-    )
-    c = g.groupBy("tx", "ty", "lang").agg(F.count("*").alias("c"))
-    m = c.groupBy("tx", "ty").agg(
-        F.max("c").alias("mc"), F.sum("c").alias("n_docs"),
-        F.count("*").alias("n_langs"),
-    )
-    top = (
-        c.join(m, ["tx", "ty"]).filter(F.col("c") == F.col("mc"))
-        .groupBy("tx", "ty").agg(F.min("lang").alias("dominant_lang"))
-    )
-    return m.join(top, ["tx", "ty"]).select(
-        "tx", "ty",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_langs").cast("long").alias("n_langs"),
-        "dominant_lang",
-        F.col("mc").cast("long").alias("dominant_cnt"),
-    )
-
-
-# --- host geographic concentration (q341) -------------------------------------
-
-
-@query(
-    "q341_host_geo_concentration",
-    f"""WITH pts AS ({POINTS_SQL}),
-       g AS (SELECT doc_id % 40 AS host,
-                    CAST(floor((lon + 180)/360.0*16) AS BIGINT) AS tx,
-                    CAST(floor((90 - lat)/180.0*16) AS BIGINT) AS ty
-             FROM pts),
-       c AS (SELECT host, tx, ty, count(*) AS c FROM g
-             GROUP BY host, tx, ty)
-       SELECT host,
-              CAST(sum(c) AS BIGINT) AS n_docs,
-              CAST(count(*) AS BIGINT) AS n_tiles,
-              CAST(max(c) AS BIGINT) AS max_tile_cnt,
-              CAST(CASE WHEN 4 * max(c) >= sum(c) THEN 1 ELSE 0 END
-                AS BIGINT) AS is_concentrated
-       FROM c GROUP BY host""",
-)
-def q341(spark, sf_dir):
-    """Host geographic concentration — is a host's content clustered
-    in one region (a local newspaper) or spread worldwide (a CDN
-    mirror)?  Per host: distinct z4 tiles touched, the hottest tile's
-    share, and a concentration flag when one tile holds >= 25% of the
-    docs (4*max >= total, exact).  The geo-affinity feature feeds
-    crawl scheduling (fetch local-heavy hosts from nearby DCs) — one
-    (host, tile) groupBy + one host rollup on the shared geocode
-    fixture."""
-    pts = _points(spark, sf_dir)
-    g = pts.select(
-        (F.col("doc_id") % 40).alias("host"),
-        F.floor((F.col("lon") + 180) / 360.0 * 16).cast("long").alias("tx"),
-        F.floor((90 - F.col("lat")) / 180.0 * 16).cast("long").alias("ty"),
-    )
-    c = g.groupBy("host", "tx", "ty").agg(F.count("*").alias("c"))
-    return c.groupBy("host").agg(
-        F.sum("c").cast("long").alias("n_docs"),
-        F.count("*").cast("long").alias("n_tiles"),
-        F.max("c").cast("long").alias("max_tile_cnt"),
-        F.when(4 * F.max("c") >= F.sum("c"), 1).otherwise(0).cast("long")
-        .alias("is_concentrated"),
-    )
-
-
-# --- geofenced compliance screen (q342) ---------------------------------------
-
-
-@query(
-    "q342_geofence_compliance",
-    f"""WITH pts AS ({POINTS_SQL}),
-       g AS (SELECT p.doc_id, d.lang,
-                    CASE WHEN p.lon >= -30 AND p.lon < 60
-                          AND p.lat >= 0 AND p.lat < 60
-                         THEN 1 ELSE 0 END AS in_region
-             FROM pts p JOIN documents d USING (doc_id))
-       SELECT lang,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(in_region) AS BIGINT) AS n_in_region,
-              CAST(sum(CASE WHEN in_region = 1 AND lang <> 'en'
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_needs_review
-       FROM g GROUP BY lang""",
-)
-def q342(spark, sf_dir):
-    """Geofenced compliance screen — the regional-policy pass a
-    multinational corpus runs (content geolocated inside a regulated
-    region in a non-default language gets routed to review): point-in-
-    rect containment over the doc-keyed geocode (exact double
-    comparisons against integer fence bounds — identical on both
-    engines), fused with the language attribute in one pass, rolled
-    up per language.  The fence here is a rect; the general-polygon
-    path is the q11 two-phase spatial join with the same downstream
-    rollup."""
-    pts = _points(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-    g = pts.join(docs, "doc_id").select(
-        "lang",
-        F.when(
-            (F.col("lon") >= -30) & (F.col("lon") < 60)
-            & (F.col("lat") >= 0) & (F.col("lat") < 60),
-            1,
-        ).otherwise(0).alias("in_region"),
-    )
-    return g.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("in_region").cast("long").alias("n_in_region"),
-        F.sum(
-            F.when((F.col("in_region") == 1) & (F.col("lang") != "en"), 1)
-            .otherwise(0)
-        ).cast("long").alias("n_needs_review"),
-    )
-
-
-# --- sparse TF-IDF nearest document (q343) ------------------------------------
-
-
-@query(
-    "q343_sparse_tfidf_neighbor",
-    """WITH w AS (SELECT doc_id, word, count(*) AS tf FROM
-                    (SELECT doc_id,
-                       unnest(string_split(text || ' tag'
-                         || CAST(doc_id % 150 AS VARCHAR), ' ')) AS word
-                     FROM documents)
-                  GROUP BY doc_id, word),
-       nd AS (SELECT count(DISTINCT doc_id) AS n FROM w),
-       dft AS (SELECT word, count(*) AS df FROM w GROUP BY word),
-       wt AS (SELECT w.doc_id, w.word,
-                     w.tf * ((length(bin(nd.n)) - 1)
-                             - (length(bin(dft.df)) - 1) + 1) AS wgt
-              FROM w JOIN dft USING (word) CROSS JOIN nd
-              WHERE dft.df <= 60),
-       pr AS (SELECT a.doc_id AS a, b.doc_id AS b,
-                     sum(a.wgt * b.wgt) AS dot
-              FROM wt a JOIN wt b
-                ON a.word = b.word AND a.doc_id <> b.doc_id
-              GROUP BY a.doc_id, b.doc_id),
-       m AS (SELECT a, max(dot) AS md FROM pr GROUP BY a),
-       top AS (SELECT pr.a, min(pr.b) AS nn
-               FROM pr JOIN m ON m.a = pr.a AND pr.dot = m.md
-               GROUP BY pr.a)
-       SELECT m.a AS doc_id, top.nn AS neighbor,
-              CAST(m.md AS BIGINT) AS dot_scaled
-       FROM m JOIN top ON top.a = m.a""",
-)
-def q343(spark, sf_dir):
-    """Sparse TF-IDF nearest document — the lexical (BM25-family)
-    complement to the dense-embedding kNN: per-term weights
-    tf * (idf_bits + 1) in exact integers, candidate pairs ONLY from
-    the shared-term join behind an ABSOLUTE df cap (df <= 60 — the
-    q19/q283 lesson verbatim: a PROPORTIONAL cap admitted the whole
-    31-word vocabulary at sf0.1 and the term self-join went quadratic,
-    373 s in the bench; the absolute cap restores sum(df^2)-bounded
-    candidates at every SF), top-1 by (dot desc, id asc).  A ' tagN'
-    rare term (N = doc_id%150) gives every doc a sub-cap
-    discriminative term so neighbors exist at every SF.  At 10^12
-    docs this is the impact-ordered sparse ANN shape: the term join
-    carries the shuffle, weights broadcast."""
-    docs = _t(spark, sf_dir, "documents")
-    w = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(
-                F.concat(F.col("text"), F.lit(" tag"),
-                         (F.col("doc_id") % 150).cast("string")),
-                " ")).alias("word"),
-        )
-        .groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    )
-    nd = w.agg(F.countDistinct("doc_id").alias("n"))
-    dft = w.groupBy("word").agg(F.count("*").alias("df"))
-    wt = (
-        w.join(F.broadcast(dft), "word")
-        .crossJoin(F.broadcast(nd))
-        .filter(F.col("df") <= 60)
-        .select(
-            "doc_id", "word",
-            (
-                F.col("tf")
-                * ((F.length(F.bin("n")) - 1)
-                   - (F.length(F.bin("df")) - 1) + 1)
-            ).alias("wgt"),
-        )
-    )
-    b = wt.selectExpr("doc_id AS bd", "word", "wgt AS bw")
-    pr = (
-        wt.join(b, "word")
-        .filter(F.col("doc_id") != F.col("bd"))
-        .groupBy(F.col("doc_id").alias("a"), F.col("bd").alias("b"))
-        .agg(F.sum(F.col("wgt") * F.col("bw")).alias("dot"))
-    )
-    m = pr.groupBy("a").agg(F.max("dot").alias("md"))
-    top = (
-        pr.join(m, "a").filter(F.col("dot") == F.col("md"))
-        .groupBy("a").agg(F.min("b").alias("nn"))
-    )
-    return m.join(top, "a").select(
-        F.col("a").alias("doc_id"),
-        F.col("nn").alias("neighbor"),
-        F.col("md").cast("long").alias("dot_scaled"),
-    )
-
-
-# --- incremental index maintenance cost (q344) --------------------------------
-
-
-@query(
-    "q344_index_maintenance_cost",
-    """WITH ch AS (SELECT doc_id FROM documents
-                   WHERE doc_id % 7 = 0
-                     AND doc_id % 10 < 9 AND doc_id % 10 > 0),
-       p AS (SELECT DISTINCT word, doc_id FROM
-               (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                FROM documents)),
-       touched AS (SELECT p.word, count(*) AS n_changed_postings
-                   FROM p JOIN ch USING (doc_id)
-                   GROUP BY p.word),
-       tot AS (SELECT word, count(*) AS df FROM p GROUP BY word)
-       SELECT tot.word,
-              CAST(tot.df AS BIGINT) AS df,
-              CAST(coalesce(touched.n_changed_postings, 0) AS BIGINT)
-                AS n_invalidate,
-              CAST(2 * coalesce(touched.n_changed_postings, 0) AS BIGINT)
-                AS n_ops
-       FROM tot LEFT JOIN touched USING (word)""",
-)
-def q344(spark, sf_dir):
-    """Incremental index maintenance cost — given the q329 snapshot
-    diff's CHANGED set (docs present in both crawl cycles whose
-    content hash moved), how many postings does each term's list
-    invalidate and rewrite (delete + reinsert = 2 ops per changed
-    posting): the capacity model for choosing delete-merge vs
-    rewrite-segment index update strategies.  One semi-join of the
-    postings table against the (small) changed set + a broadcast df
-    join — maintenance cost is proportional to the CHANGED postings,
-    never the index size, which is the entire point of incremental
-    maintenance."""
-    docs = _t(spark, sf_dir, "documents")
-    ch = docs.filter(
-        (F.col("doc_id") % 7 == 0)
-        & (F.col("doc_id") % 10 < 9) & (F.col("doc_id") % 10 > 0)
-    ).select("doc_id")
-    p = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .distinct()
-    )
-    touched = (
-        p.join(F.broadcast(ch), "doc_id")
-        .groupBy("word").agg(F.count("*").alias("n_changed_postings"))
-    )
-    tot = p.groupBy("word").agg(F.count("*").alias("df"))
-    return tot.join(touched, "word", "left").select(
-        "word",
-        F.col("df").cast("long").alias("df"),
-        F.coalesce("n_changed_postings", F.lit(0)).cast("long")
-        .alias("n_invalidate"),
-        (2 * F.coalesce("n_changed_postings", F.lit(0))).cast("long")
-        .alias("n_ops"),
-    )
-
-
-# --- query-term proximity scoring (q345) --------------------------------------
-
-
-@query(
-    "q345_term_proximity",
-    """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q345 oracle range bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       pos AS (SELECT doc_id, w[r.range] AS word, r.range AS p
-               FROM s, range(1, 200) r WHERE r.range <= len(w)),
-       q AS (SELECT 0 AS qid, 'join' AS t1, 'filter' AS t2
-             UNION ALL SELECT 1, 'hash', 'sort'
-             UNION ALL SELECT 2, 'scan', 'merge'),
-       hits AS (SELECT q.qid, p1.doc_id,
-                       min(abs(p1.p - p2.p)) AS min_span
-                FROM q JOIN pos p1 ON p1.word = q.t1
-                       JOIN pos p2 ON p2.word = q.t2
-                              AND p2.doc_id = p1.doc_id
-                GROUP BY q.qid, p1.doc_id),
-       best AS (SELECT qid, min(min_span) AS best_span,
-                       count(*) AS n_docs_with_both
-                FROM hits GROUP BY qid),
-       winner AS (SELECT h.qid, min(h.doc_id) AS best_doc
-                  FROM hits h JOIN best b
-                    ON b.qid = h.qid AND h.min_span = b.best_span
-                  GROUP BY h.qid)
-       SELECT b.qid,
-              CAST(b.n_docs_with_both AS BIGINT) AS n_docs_with_both,
-              CAST(b.best_span AS BIGINT) AS best_span,
-              CAST(w.best_doc AS BIGINT) AS best_doc
-       FROM best b JOIN winner w ON w.qid = b.qid, chk""",
-)
-def q345(spark, sf_dir):
-    """Query-term proximity scoring — the positional-index ranking
-    feature (documents where both terms appear CLOSE outrank mere
-    co-occurrence): for each 2-term query, the per-doc minimum
-    position span |p1 - p2| over all occurrence pairs, then the
-    best-proximity doc per query (min span, ties to lowest doc).
-    The occurrence-pair join is doc-keyed and bounded by per-doc
-    term counts (the postings already intersected, the q287 shape
-    with positions attached) — exactly how a positional index scores
-    phrase-nearness at serving time."""
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select("doc_id", F.split("text", " ").alias("w"))
-    pos = s.select(
-        "doc_id", F.posexplode("w").alias("p0", "word")
-    ).select("doc_id", "word", (F.col("p0") + 1).alias("p"))
-    q = spark.createDataFrame(
-        [(0, "join", "filter"), (1, "hash", "sort"), (2, "scan", "merge")],
-        "qid INT, t1 STRING, t2 STRING",
-    )
-    p1 = pos.selectExpr("doc_id", "word AS t1", "p AS pa")
-    p2 = pos.selectExpr("doc_id", "word AS t2", "p AS pb")
-    hits = (
-        F.broadcast(q).join(p1, "t1")
-        .join(p2, ["t2", "doc_id"])
-        .groupBy("qid", "doc_id")
-        .agg(F.min(F.abs(F.col("pa") - F.col("pb"))).alias("min_span"))
-    )
-    best = hits.groupBy("qid").agg(
-        F.min("min_span").alias("best_span"),
-        F.count("*").alias("n_docs_with_both"),
-    )
-    winner = (
-        hits.join(best, "qid")
-        .filter(F.col("min_span") == F.col("best_span"))
-        .groupBy("qid").agg(F.min("doc_id").alias("best_doc"))
-    )
-    return best.join(winner, "qid").select(
-        "qid",
-        F.col("n_docs_with_both").cast("long").alias("n_docs_with_both"),
-        F.col("best_span").cast("long").alias("best_span"),
-        F.col("best_doc").cast("long").alias("best_doc"),
-    )
-
-
-# --- dictionary topic tagging (q346) ------------------------------------------
-
-
-@query(
-    "q346_topic_tagging",
-    """WITH lex AS (SELECT * FROM (VALUES
-                 ('db', 'join'), ('db', 'hash'), ('db', 'scan'),
-                 ('db', 'merge'),
-                 ('perf', 'fast'), ('perf', 'slow'), ('perf', 'batch'),
-                 ('perf', 'window'),
-                 ('data', 'table'), ('data', 'row'), ('data', 'value'),
-                 ('data', 'customer')) t(topic, word)),
-       w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-             FROM documents),
-       sc AS (SELECT w.doc_id, lex.topic, count(*) AS score
-              FROM w JOIN lex USING (word)
-              GROUP BY w.doc_id, lex.topic),
-       m AS (SELECT doc_id, max(score) AS ms, sum(score) AS total
-             FROM sc GROUP BY doc_id),
-       top AS (SELECT sc.doc_id, min(sc.topic) AS topic
-               FROM sc JOIN m ON m.doc_id = sc.doc_id AND sc.score = m.ms
-               GROUP BY sc.doc_id)
-       SELECT m.doc_id, top.topic,
-              CAST(m.ms AS BIGINT) AS topic_score,
-              CAST(m.total AS BIGINT) AS lex_hits
-       FROM m JOIN top ON top.doc_id = m.doc_id""",
-)
-def q346(spark, sf_dir):
-    """Dictionary topic tagging — the lexicon-based classifier
-    (Aho-Corasick-lite over a token join) that labels every document
-    with its dominant topic: a 3-topic x 4-word lexicon broadcasts
-    against the token stream, per-(doc, topic) hit counts roll up,
-    and the tag is the max-score/lex-min topic.  The lexicon join is
-    the whole trick — at 10^12 tokens the lexicon side is bytes and
-    the tagging runs at scan speed; this is how rule-based routing
-    (safety lexicons, domain routers) runs before any model."""
-    lex = spark.createDataFrame(
-        [("db", "join"), ("db", "hash"), ("db", "scan"), ("db", "merge"),
-         ("perf", "fast"), ("perf", "slow"), ("perf", "batch"),
-         ("perf", "window"),
-         ("data", "table"), ("data", "row"), ("data", "value"),
-         ("data", "customer")],
-        "topic STRING, word STRING",
-    )
-    docs = _t(spark, sf_dir, "documents")
-    w = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    sc = (
-        w.join(F.broadcast(lex), "word")
-        .groupBy("doc_id", "topic").agg(F.count("*").alias("score"))
-    )
-    m = sc.groupBy("doc_id").agg(
-        F.max("score").alias("ms"), F.sum("score").alias("total"))
-    top = (
-        sc.join(m, "doc_id").filter(F.col("score") == F.col("ms"))
-        .groupBy("doc_id").agg(F.min("topic").alias("topic"))
-    )
-    return m.join(top, "doc_id").select(
-        "doc_id", "topic",
-        F.col("ms").cast("long").alias("topic_score"),
-        F.col("total").cast("long").alias("lex_hits"),
-    )
-
-
-# --- A/B conversion with Wilson bounds (q347) ---------------------------------
-
-
-@query(
-    "q347_ab_wilson_bounds",
-    """WITH u AS (SELECT user_id, user_id % 2 AS arm,
-                    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                        END) AS converted
-                  FROM events GROUP BY user_id),
-       a AS (SELECT arm, count(*) AS n, sum(converted) AS x FROM u
-             GROUP BY arm)
-       SELECT arm,
-              CAST(n AS BIGINT) AS n_users,
-              CAST(x AS BIGINT) AS n_converted,
-              (CAST(x AS DOUBLE) / CAST(n AS DOUBLE)
-               + 1.9208 / CAST(n AS DOUBLE)
-               - 1.96 * sqrt((CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-                 * (1.0 - CAST(x AS DOUBLE) / CAST(n AS DOUBLE))
-                 / CAST(n AS DOUBLE)
-                 + 0.9604 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))))
-               / (1.0 + 3.8416 / CAST(n AS DOUBLE)) AS wilson_lower
-       FROM a""",
-)
-def q347(spark, sf_dir):
-    """A/B conversion accounting with the Wilson lower bound — the
-    experiment readout (is arm B's conversion genuinely above arm
-    A's floor): users split by parity, conversion = any purchase
-    (max-flag per user, combinable), and the 95% Wilson score lower
-    bound computed as ONE fixed float expression over the exact
-    integer (n, x) pair — z constants (1.96, z^2=3.8416, z^2/2=
-    1.9208, z^4/4=0.9604) inlined verbatim on both engines so the
-    IEEE tree is identical (the CLAUDE.md inline-constants rule).
-    Two user-keyed aggregations; the bound math is per-arm O(1)."""
-    e = _t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.max(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).alias("converted")
-    ).select(
-        (F.col("user_id") % 2).alias("arm"), "converted")
-    a = u.groupBy("arm").agg(
-        F.count("*").alias("n"), F.sum("converted").alias("x"))
-    p = F.col("x").cast("double") / F.col("n").cast("double")
-    nn = F.col("n").cast("double")
-    return a.select(
-        "arm",
-        F.col("n").cast("long").alias("n_users"),
-        F.col("x").cast("long").alias("n_converted"),
-        (
-            (p + F.lit(1.9208) / nn
-             - F.lit(1.96) * F.sqrt(p * (F.lit(1.0) - p) / nn
-                                    + F.lit(0.9604) / (nn * nn)))
-            / (F.lit(1.0) + F.lit(3.8416) / nn)
-        ).alias("wilson_lower"),
-    )
-
-
-# --- corpus datasheet (q348) --------------------------------------------------
-
-
-@query(
-    "q348_corpus_datasheet",
-    """WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                  FROM documents),
-       d AS (SELECT count(*) AS n_docs,
-                    sum(n_chars) AS total_chars,
-                    count(DISTINCT lang) AS n_langs,
-                    count(DISTINCT source) AS n_sources,
-                    count(DISTINCT md5(text)) AS n_unique_texts
-             FROM documents),
-       t AS (SELECT count(*) AS n_tokens,
-                    count(DISTINCT word) AS vocab FROM w)
-       SELECT CAST(d.n_docs AS BIGINT) AS n_docs,
-              CAST(t.n_tokens AS BIGINT) AS n_tokens,
-              CAST(t.vocab AS BIGINT) AS vocab_size,
-              CAST(d.total_chars AS BIGINT) AS total_chars,
-              CAST(d.n_langs AS BIGINT) AS n_langs,
-              CAST(d.n_sources AS BIGINT) AS n_sources,
-              CAST(d.n_docs - d.n_unique_texts AS BIGINT) AS n_exact_dups
-       FROM d, t""",
-)
-def q348(spark, sf_dir):
-    """Corpus datasheet — the one-row dataset card (Datasheets for
-    Datasets) every corpus release ships: document/token/vocabulary/
-    byte counts, language and source diversity, and the exact-dup
-    count — seven numbers from TWO scans (one over documents, one
-    over the token explode), every aggregate map-side combinable.
-    This is the summary the q300 per-host scorecard rolls up to at
-    release granularity."""
-    docs = _t(spark, sf_dir, "documents")
-    w = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    d = docs.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.countDistinct("source").alias("n_sources"),
-        F.countDistinct(F.md5("text")).alias("n_unique_texts"),
-    )
-    t = w.agg(
-        F.count("*").alias("n_tokens"),
-        F.countDistinct("word").alias("vocab"),
-    )
-    return d.crossJoin(F.broadcast(t)).select(
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("vocab").cast("long").alias("vocab_size"),
-        F.col("total_chars").cast("long").alias("total_chars"),
-        F.col("n_langs").cast("long").alias("n_langs"),
-        F.col("n_sources").cast("long").alias("n_sources"),
-        (F.col("n_docs") - F.col("n_unique_texts")).cast("long")
-        .alias("n_exact_dups"),
-    )
-
-
-# --- crawl yield accounting (q349) --------------------------------------------
-
-
-@query(
-    "q349_crawl_yield",
-    """WITH d AS (SELECT doc_id % 20 AS host, n_chars,
-                    CASE WHEN n_chars >= 200 AND lang = 'en'
-                         THEN 1 ELSE 0 END AS kept
-                  FROM documents)
-       SELECT host,
-              CAST(count(*) AS BIGINT) AS n_fetched,
-              CAST(sum(n_chars) AS BIGINT) AS bytes_fetched,
-              CAST(sum(kept) AS BIGINT) AS n_kept,
-              CAST(sum(CASE WHEN kept = 1 THEN n_chars ELSE 0 END)
-                AS BIGINT) AS bytes_kept,
-              CAST(sum(CASE WHEN kept = 1 THEN n_chars ELSE 0 END)
-                   AS DOUBLE) / CAST(sum(n_chars) AS DOUBLE)
-                AS byte_yield
-       FROM d GROUP BY host""",
-)
-def q349(spark, sf_dir):
-    """Crawl yield accounting — the economics metric behind crawl
-    budget decisions (fetch bytes are paid; kept bytes earn): per
-    host, fetched/kept doc and byte counts under a simple keep gate
-    (n_chars >= 200 AND lang = 'en' — the production gate is the
-    q232 Gopher composite; the rollup shape is identical) and the
-    byte yield as one exact-integer division.  Hosts with low yield
-    get their frontier quota cut — this feeds q350's budget
-    apportionment.  One host-keyed combinable rollup."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        (F.col("doc_id") % 20).alias("host"), "n_chars",
-        F.when((F.col("n_chars") >= 200) & (F.col("lang") == "en"), 1)
-        .otherwise(0).alias("kept"),
-    )
-    return d.groupBy("host").agg(
-        F.count("*").cast("long").alias("n_fetched"),
-        F.sum("n_chars").cast("long").alias("bytes_fetched"),
-        F.sum("kept").cast("long").alias("n_kept"),
-        F.sum(F.when(F.col("kept") == 1, F.col("n_chars")).otherwise(0))
-        .cast("long").alias("bytes_kept"),
-        (
-            F.sum(F.when(F.col("kept") == 1, F.col("n_chars")).otherwise(0))
-            .cast("double") / F.sum("n_chars").cast("double")
-        ).alias("byte_yield"),
-    )
-
-
-# --- recrawl budget apportionment (q350) --------------------------------------
-
-
-@query(
-    "q350_recrawl_budget",
-    """WITH ch AS (SELECT doc_id,
-                     (SELECT sum(CASE WHEN (t.range * (1 + doc_id % 4)) // 5
-                                       <> ((t.range - 1) * (1 + doc_id % 4)) // 5
-                                 THEN 1 ELSE 0 END)
-                      FROM range(1, 10) t) AS n_changes
-                   FROM documents),
-       cls AS (SELECT doc_id,
-                      CASE WHEN n_changes * 2 >= 9 THEN 4
-                           WHEN n_changes >= 2 THEN 2
-                           ELSE 1 END AS w
-               FROM ch),
-       tot AS (SELECT sum(w) AS tw FROM cls),
-       q AS (SELECT cls.doc_id, cls.w,
-                    (cls.w * 1000) // tot.tw AS base,
-                    (cls.w * 1000) % tot.tw AS rem
-             FROM cls CROSS JOIN tot),
-       k AS (SELECT CAST(1000 - sum(base) AS BIGINT) AS n_extra FROM q),
-       rk AS (SELECT a.doc_id,
-                     (SELECT count(*) FROM q b
-                      WHERE b.rem > a.rem
-                         OR (b.rem = a.rem AND b.doc_id < a.doc_id)) + 1
-                       AS rnk
-              FROM q a),
-       fin AS (SELECT q.doc_id, q.w, q.base,
-                      CASE WHEN rk.rnk <= k.n_extra THEN 1 ELSE 0 END
-                        AS extra
-               FROM q JOIN rk USING (doc_id) CROSS JOIN k)
-       SELECT CAST(w AS BIGINT) AS revisit_weight,
-              CAST(count(*) AS BIGINT) AS n_urls,
-              CAST(sum(base + extra) AS BIGINT) AS slots
-       FROM fin GROUP BY w""",
-)
-def q350(spark, sf_dir):
-    """Recrawl budget apportionment — the q299 change-rate classes
-    (hot=4 / warm=2 / cold=1 weights) share 1000 fetch slots by the
-    LARGEST-REMAINDER method (the q274 Hamilton machinery applied to
-    the crawl stack): integer base quotas floor(w*K/total) sum to at
-    most K by construction, the remaining slots go to the largest
-    remainders with deterministic (remainder desc, doc asc) ties via
-    the count-of-greater rank — total slots are EXACTLY K, rolled up
-    per class.  This closes the loop q299 -> q349 -> budget: exact
-    integer arithmetic end to end, one broadcast total + one
-    bounded rank join."""
-    docs = _t(spark, sf_dir, "documents")
-    f = docs.select(
-        "doc_id", F.explode(F.sequence(F.lit(1), F.lit(9))).alias("t")
-    ).select(
-        "doc_id",
-        (F.expr("(t * (1 + doc_id % 4)) div 5")
-         != F.expr("((t - 1) * (1 + doc_id % 4)) div 5")).cast("int")
-        .alias("chg"),
-    )
-    ch = f.groupBy("doc_id").agg(F.sum("chg").alias("n_changes"))
-    cls = ch.select(
-        "doc_id",
-        F.when(F.col("n_changes") * 2 >= 9, 4)
-        .when(F.col("n_changes") >= 2, 2).otherwise(1).alias("w"),
-    )
-    tot = cls.agg(F.sum("w").alias("tw"))
-    q = cls.crossJoin(F.broadcast(tot)).select(
-        "doc_id", "w",
-        F.expr("(w * 1000) div tw").alias("base"),
-        ((F.col("w") * 1000) % F.col("tw")).alias("rem"),
-    )
-    k = q.agg((1000 - F.sum("base")).alias("n_extra"))
-    b = q.selectExpr("doc_id AS bd", "rem AS brem")
-    rk = (
-        q.join(
-            F.broadcast(b),
-            (F.col("brem") > F.col("rem"))
-            | ((F.col("brem") == F.col("rem"))
-               & (F.col("bd") < F.col("doc_id"))),
-            "left",
-        )
-        .groupBy("doc_id", "w", "base", "rem")
-        .agg((F.count("bd") + 1).alias("rnk"))
-    )
-    fin = rk.crossJoin(F.broadcast(k)).select(
-        "w", "base",
-        F.when(F.col("rnk") <= F.col("n_extra"), 1).otherwise(0)
-        .alias("extra"),
-    )
-    return fin.groupBy(F.col("w").alias("revisit_weight")).agg(
-        F.count("*").cast("long").alias("n_urls"),
-        F.sum(F.col("base") + F.col("extra")).cast("long").alias("slots"),
     )
 
 
@@ -19720,6 +9722,7 @@ _Q351_HASH_SQL = """d AS (SELECT doc_id,
                            JOIN hsh hb ON hb.doc_id = c.b)
        SELECT a, b, CAST(hamming AS BIGINT) AS hamming
        FROM ver WHERE hamming <= 2""",
+    kind="operator",
 )
 def q351(spark, sf_dir):
     """Image near-dup at Hamming <= 2 over the q145 perceptual aHash
@@ -19789,2874 +9792,6 @@ def q351(spark, sf_dir):
         "a", "b", F.col("hamming").cast("long").alias("hamming"))
 
 
-# --- storage tiering plan (q352) ----------------------------------------------
-
-
-@query(
-    "q352_storage_tiering",
-    """WITH ev AS (SELECT CAST(regexp_extract(props, '([0-9]+)', 1)
-                            AS BIGINT) AS item,
-                     CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS d
-                   FROM events),
-       sp AS (SELECT max(d) AS dmax FROM ev),
-       a AS (SELECT item, count(*) AS n_acc, max(d) AS last_d
-             FROM ev GROUP BY item)
-       SELECT a.item,
-              CAST(a.n_acc AS BIGINT) AS n_accesses,
-              CAST(sp.dmax - a.last_d AS BIGINT) AS days_idle,
-              CASE WHEN sp.dmax - a.last_d <= 2 AND a.n_acc >= 50
-                   THEN 'hot'
-                   WHEN sp.dmax - a.last_d <= 7 THEN 'warm'
-                   ELSE 'cold' END AS tier
-       FROM a CROSS JOIN sp""",
-)
-def q352(spark, sf_dir):
-    """Storage tiering plan — the hot/warm/cold placement every
-    serving cache and object store runs nightly: per item, access
-    count and idle days (vs the observed max day), tier decided by
-    exact integer recency/frequency thresholds (hot: touched within
-    2 days AND >= 50 accesses; warm: within a week; cold otherwise).
-    One item-keyed rollup + a broadcast 1-row span — placement for
-    10^12 objects is a single combinable aggregation, and the tier
-    column drives the actual data movement job."""
-    ev = _t(spark, sf_dir, "events").select(
-        F.regexp_extract("props", "([0-9]+)", 1).cast("long").alias("item"),
-        F.expr("CAST(unix_timestamp(ts) div 86400 AS BIGINT)").alias("d"),
-    )
-    sp = ev.agg(F.max("d").alias("dmax"))
-    a = ev.groupBy("item").agg(
-        F.count("*").alias("n_acc"), F.max("d").alias("last_d"))
-    return a.crossJoin(F.broadcast(sp)).select(
-        "item",
-        F.col("n_acc").cast("long").alias("n_accesses"),
-        (F.col("dmax") - F.col("last_d")).cast("long").alias("days_idle"),
-        F.when(
-            ((F.col("dmax") - F.col("last_d")) <= 2)
-            & (F.col("n_acc") >= 50), "hot",
-        ).when((F.col("dmax") - F.col("last_d")) <= 7, "warm")
-        .otherwise("cold").alias("tier"),
-    )
-
-
-# --- Newman modularity of the host partition (q353) ---------------------------
-
-
-@query(
-    "q353_modularity",
-    """WITH h AS (SELECT DISTINCT doc_id % 60 AS hh FROM documents),
-       e0 AS (SELECT hh, unnest([1, 2, 3]) AS j FROM h),
-       ed AS (SELECT DISTINCT least(hh, (hh * j + j * j * 7) % 60) AS u,
-                     greatest(hh, (hh * j + j * j * 7) % 60) AS v
-              FROM e0 WHERE hh <> (hh * j + j * j * 7) % 60),
-       m AS (SELECT count(*) AS m FROM ed),
-       deg AS (SELECT n, count(*) AS d FROM
-                 (SELECT u AS n FROM ed UNION ALL SELECT v FROM ed)
-               GROUP BY n),
-       comm AS (SELECT deg.n, deg.d, deg.n % 4 AS c FROM deg),
-       ein AS (SELECT u % 4 AS c, count(*) AS e_in FROM ed
-               WHERE u % 4 = v % 4 GROUP BY u % 4),
-       dsum AS (SELECT c, sum(d) AS d_c FROM comm GROUP BY c),
-       cell AS (SELECT dsum.c,
-                       coalesce(ein.e_in, 0) AS e_in,
-                       dsum.d_c,
-                       4 * m.m * coalesce(ein.e_in, 0)
-                         - dsum.d_c * dsum.d_c AS q_num_c
-                FROM dsum LEFT JOIN ein USING (c) CROSS JOIN m)
-       SELECT c AS community,
-              CAST(e_in AS BIGINT) AS e_in,
-              CAST(d_c AS BIGINT) AS degree_sum,
-              CAST(q_num_c AS BIGINT) AS q_num_c,
-              (SELECT CAST(4 * m.m * m.m AS BIGINT) FROM m) AS q_den
-       FROM cell""",
-)
-def q353(spark, sf_dir):
-    """Newman modularity of the host%4 partition — the community-
-    quality number (Q = sum_c [e_c/m - (d_c/2m)^2]) kept as EXACT
-    integer rationals: per community the numerator cell
-    4*m*e_c - d_c^2 over the shared denominator 4*m^2, so
-    Q = sum(q_num_c)/q_den with no float until a consumer divides.
-    Communities here are the deterministic host%4 blocks (the
-    partition under evaluation — in production the q94/q286
-    cluster labels); e_in and degree sums are two combinable
-    aggregations over the undirected edge list.  The sign of
-    sum(q_num_c) alone answers 'better than random?' — exactly."""
-    docs = _t(spark, sf_dir, "documents")
-    h = docs.selectExpr("doc_id % 60 AS hh").distinct()
-    e0 = h.select(
-        "hh", F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("j")
-    ).selectExpr("hh", "(hh * j + j * j * 7) % 60 AS t")
-    ed = (
-        e0.filter("hh <> t")
-        .selectExpr("least(hh, t) AS u", "greatest(hh, t) AS v")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    m = ed.agg(F.count("*").alias("m"))
-    deg = (
-        ed.selectExpr("u AS n").unionAll(ed.selectExpr("v AS n"))
-        .groupBy("n").agg(F.count("*").alias("d"))
-    )
-    dsum = deg.groupBy((F.col("n") % 4).alias("c")).agg(
-        F.sum("d").alias("d_c"))
-    ein = (
-        ed.filter(F.col("u") % 4 == F.col("v") % 4)
-        .groupBy((F.col("u") % 4).alias("c"))
-        .agg(F.count("*").alias("e_in"))
-    )
-    cell = (
-        dsum.join(ein, "c", "left")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "c",
-            F.coalesce("e_in", F.lit(0)).alias("e_in"),
-            "d_c",
-            (4 * F.col("m") * F.coalesce("e_in", F.lit(0))
-             - F.col("d_c") * F.col("d_c")).alias("q_num_c"),
-            (4 * F.col("m") * F.col("m")).alias("q_den"),
-        )
-    )
-    return cell.select(
-        F.col("c").alias("community"),
-        F.col("e_in").cast("long").alias("e_in"),
-        F.col("d_c").cast("long").alias("degree_sum"),
-        F.col("q_num_c").cast("long").alias("q_num_c"),
-        F.col("q_den").cast("long").alias("q_den"),
-    )
-
-
-# --- distance-weighted co-occurrence counts (q354) ----------------------------
-
-
-@query(
-    "q354_glove_cooccurrence",
-    """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q354 oracle range bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       co AS (SELECT w[r.range] AS x, w[r.range + o.range] AS y,
-                     CASE WHEN o.range = 1 THEN 2 ELSE 1 END AS wgt
-              FROM s, range(1, 200) r, range(1, 3) o
-              WHERE r.range + o.range <= len(w)),
-       agg AS (SELECT x, y, sum(wgt) AS cowgt, count(*) AS n_pairs
-               FROM co GROUP BY x, y)
-       SELECT x, y,
-              CAST(cowgt AS BIGINT) AS cowgt,
-              CAST(n_pairs AS BIGINT) AS n_pairs
-       FROM agg, chk WHERE cowgt >= 100""",
-)
-def q354(spark, sf_dir):
-    """Distance-weighted co-occurrence counts (the GloVe X matrix
-    with the 1/d weighting made integer-exact: distance 1 scores 2,
-    distance 2 scores 1 — the 2/d scheme): forward window of 2,
-    position-exploded (the q240 gram-table shape — HOF per-row loops
-    measured and rejected for this), one (x, y)-keyed combinable sum,
-    head filtered at cowgt >= 100 to keep the output the matrix HEAD
-    the embedding trainer actually densifies.  At 10^12 tokens this
-    is THE co-occurrence shuffle; the window never widens the rows,
-    only the explode factor (2 here)."""
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select("doc_id", F.split("text", " ").alias("w"))
-    co1 = s.select(
-        F.explode(F.expr(
-            "transform(sequence(1, size(w) - 1), "
-            "i -> struct(w[i - 1] AS x, w[i] AS y))")).alias("p")
-    ).select("p.x", "p.y", F.lit(2).alias("wgt"))
-    co2 = s.filter(F.size("w") >= 3).select(
-        F.explode(F.expr(
-            "transform(sequence(1, size(w) - 2), "
-            "i -> struct(w[i - 1] AS x, w[i + 1] AS y))")).alias("p")
-    ).select("p.x", "p.y", F.lit(1).alias("wgt"))
-    co = co1.unionAll(co2)
-    agg = co.groupBy("x", "y").agg(
-        F.sum("wgt").alias("cowgt"), F.count("*").alias("n_pairs"))
-    return agg.filter(F.col("cowgt") >= 100).select(
-        "x", "y",
-        F.col("cowgt").cast("long").alias("cowgt"),
-        F.col("n_pairs").cast("long").alias("n_pairs"),
-    )
-
-
-# --- negative-sampling table (q355) -------------------------------------------
-
-
-@query(
-    "q355_negative_sampling_table",
-    """WITH w AS (SELECT word, count(*) AS f FROM
-                    (SELECT unnest(string_split(text, ' ')) AS word
-                     FROM documents)
-                  GROUP BY word),
-       p AS (SELECT word, f,
-                    CAST(floor(sqrt(floor(sqrt(
-                      CAST(f AS DOUBLE) * CAST(f AS DOUBLE)
-                      * CAST(f AS DOUBLE))))) AS BIGINT) AS w34
-             FROM w),
-       t AS (SELECT sum(w34) AS tw FROM p),
-       q AS (SELECT p.word, p.f, p.w34,
-                    (p.w34 * 10000) // t.tw AS base,
-                    (p.w34 * 10000) % t.tw AS rem
-             FROM p CROSS JOIN t),
-       k AS (SELECT CAST(10000 - sum(base) AS BIGINT) AS n_extra FROM q),
-       rk AS (SELECT a.word,
-                     (SELECT count(*) FROM q b
-                      WHERE b.rem > a.rem
-                         OR (b.rem = a.rem AND b.word < a.word)) + 1
-                       AS rnk
-              FROM q a)
-       SELECT q.word, CAST(q.f AS BIGINT) AS freq,
-              CAST(q.w34 AS BIGINT) AS w34,
-              CAST(q.base + CASE WHEN rk.rnk <= k.n_extra THEN 1 ELSE 0
-                            END AS BIGINT) AS table_slots
-       FROM q JOIN rk USING (word) CROSS JOIN k""",
-)
-def q355(spark, sf_dir):
-    """word2vec negative-sampling table — the unigram^(3/4)
-    distribution (Mikolov) realized EXACTLY: f^(3/4) as the integer
-    floor(sqrt(floor(sqrt(f^3)))) (two correctly-rounded IEEE sqrts
-    + floors, identical in both engines — no pow), then 10000 table
-    slots apportioned by largest remainder with deterministic ties
-    (the q274/q350 Hamilton machinery), so slots sum to EXACTLY the
-    table size and the sampling table is reproducible forever.
-    Lexicon-bounded throughout; the down-weighting of the head
-    (f^0.75 flattens Zipf) is visible in slots/freq."""
-    docs = _t(spark, sf_dir, "documents")
-    w = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("word").agg(F.count("*").alias("f"))
-    )
-    p = w.select(
-        "word", "f",
-        F.floor(F.sqrt(F.floor(F.sqrt(
-            F.col("f").cast("double") * F.col("f").cast("double")
-            * F.col("f").cast("double")
-        )))).cast("long").alias("w34"),
-    )
-    t = p.agg(F.sum("w34").alias("tw"))
-    q = p.crossJoin(F.broadcast(t)).select(
-        "word", "f", "w34",
-        F.expr("(w34 * 10000) div tw").alias("base"),
-        ((F.col("w34") * 10000) % F.col("tw")).alias("rem"),
-    )
-    k = q.agg((10000 - F.sum("base")).alias("n_extra"))
-    b = q.selectExpr("word AS bw", "rem AS brem")
-    rk = (
-        q.join(
-            F.broadcast(b),
-            (F.col("brem") > F.col("rem"))
-            | ((F.col("brem") == F.col("rem"))
-               & (F.col("bw") < F.col("word"))),
-            "left",
-        )
-        .groupBy("word", "f", "w34", "base", "rem")
-        .agg((F.count("bw") + 1).alias("rnk"))
-    )
-    return rk.crossJoin(F.broadcast(k)).select(
-        "word",
-        F.col("f").cast("long").alias("freq"),
-        F.col("w34").cast("long").alias("w34"),
-        (F.col("base")
-         + F.when(F.col("rnk") <= F.col("n_extra"), 1).otherwise(0))
-        .cast("long").alias("table_slots"),
-    )
-
-
-# --- deterministic epoch shuffling (q356) -------------------------------------
-
-
-@query(
-    "q356_epoch_shuffle",
-    """WITH d AS (SELECT doc_id FROM documents),
-       ep AS (SELECT e.range AS epoch, d.doc_id,
-                CAST(CAST('0x' || substr(md5('ep' ||
-                       CAST(e.range AS VARCHAR) || ':' ||
-                       CAST(d.doc_id AS VARCHAR)), 1, 8) AS UBIGINT)
-                     AS BIGINT) AS key
-              FROM d, range(0, 2) e),
-       rk AS (SELECT a.epoch, a.doc_id,
-                     (SELECT count(*) FROM ep b
-                      WHERE b.epoch = a.epoch
-                        AND (b.key < a.key
-                             OR (b.key = a.key AND b.doc_id < a.doc_id)))
-                       + 1 AS pos
-              FROM ep a)
-       SELECT epoch, CAST(pos AS BIGINT) AS pos,
-              CAST(doc_id AS BIGINT) AS doc_id
-       FROM rk WHERE pos <= 10""",
-)
-def q356(spark, sf_dir):
-    """Deterministic epoch shuffling — the reproducible training-data
-    order (seeded shuffles must replay bit-identically across
-    restarts and frameworks): each epoch's order key is the
-    md5-derived integer of ('ep'||epoch||':'||doc), and the emitted
-    head (first 10 positions of epochs 0 and 1) proves the orders
-    differ across epochs yet are fully deterministic.  Position =
-    count-of-smaller — at fixture scale a bounded self-join; at
-    10^12 docs the SAME key feeds a repartitionByRange+sort and the
-    count-of-smaller is never materialized (the key, not the rank,
-    is the contract)."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    ep = docs.crossJoin(
-        F.broadcast(spark.range(0, 2).selectExpr("id AS epoch"))
-    ).withColumn(
-        "key",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ep"), F.col("epoch").cast("string"),
-                               F.lit(":"), F.col("doc_id").cast("string"))),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long"),
-    )
-    b = ep.selectExpr("epoch AS bep", "doc_id AS bd", "key AS bk")
-    rk = (
-        ep.join(
-            b,
-            (F.col("epoch") == F.col("bep"))
-            & ((F.col("bk") < F.col("key"))
-               | ((F.col("bk") == F.col("key"))
-                  & (F.col("bd") < F.col("doc_id")))),
-            "left",
-        )
-        .groupBy("epoch", "doc_id")
-        .agg((F.count("bd") + 1).alias("pos"))
-    )
-    return rk.filter(F.col("pos") <= 10).select(
-        "epoch",
-        F.col("pos").cast("long").alias("pos"),
-        F.col("doc_id").cast("long").alias("doc_id"),
-    )
-
-
-# --- fused dedup decision matrix (q357) ---------------------------------------
-
-
-@query(
-    "q357_dedup_decision_matrix",
-    """WITH src AS (SELECT doc_id,
-                     CASE WHEN doc_id % 30 = 7 THEN
-                       (CASE WHEN (doc_id // 30) % 2 = 0
-                             THEN 'alpha' ELSE 'Alpha' END)
-                       || ' beta gamma delta five six seven eight nine ten'
-                       || ' tail' || CAST(doc_id % 7 AS VARCHAR)
-                     ELSE text END AS body
-                   FROM documents),
-       d AS (SELECT doc_id,
-                    md5(body) AS h_exact,
-                    md5(lower(regexp_replace(regexp_replace(body,
-                        '[^a-zA-Z0-9]+', ' ', 'g'), ' +', ' ', 'g')))
-                      AS h_norm,
-                    md5(array_to_string(string_split(body, ' ')[1:8], ' '))
-                      AS h_prefix
-                  FROM src),
-       fe AS (SELECT h_exact, min(doc_id) AS k FROM d GROUP BY h_exact),
-       fn AS (SELECT h_norm, min(doc_id) AS k FROM d GROUP BY h_norm),
-       fp AS (SELECT h_prefix, min(doc_id) AS k FROM d
-              GROUP BY h_prefix),
-       m AS (SELECT d.doc_id,
-                    CASE WHEN fe.k < d.doc_id THEN 1 ELSE 0 END AS dup_e,
-                    CASE WHEN fn.k < d.doc_id THEN 1 ELSE 0 END AS dup_n,
-                    CASE WHEN fp.k < d.doc_id THEN 1 ELSE 0 END AS dup_p
-             FROM d JOIN fe USING (h_exact) JOIN fn USING (h_norm)
-                    JOIN fp USING (h_prefix))
-       SELECT dup_e AS dup_exact, dup_n AS dup_normalized,
-              dup_p AS dup_prefix,
-              CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(CASE WHEN dup_e = 0 AND dup_n = 0 AND dup_p = 0
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
-       FROM m GROUP BY dup_e, dup_n, dup_p""",
-)
-def q357(spark, sf_dir):
-    """Fused dedup decision matrix — the FINAL keep/drop gate a
-    corpus release applies, with all three dedup keys evaluated in
-    ONE pass (exact md5, CCNet-normalized md5, 8-word-prefix md5 —
-    each level's min-id keeper decides 'am I the first?'), and the
-    full 2^3 agreement matrix emitted (which levels fire together —
-    the column that justifies running the cheaper level first).
-    Three hash groupBys + three equi-joins back, the q318/q329
-    fused-membership pattern at dedup granularity; a doc survives
-    iff it is the keeper at EVERY level.  Case-variant template docs
-    (doc_id%30==7, alternating 'alpha'/'Alpha' leads, tail outside
-    the 8-word prefix) plus natural first-8-word collisions populate
-    the partial-agreement cells — prefix-only and normalized+prefix
-    dups both occur, so the levels provably dissociate."""
-    docs = _t(spark, sf_dir, "documents")
-    src = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 30 == 7,
-            F.concat(
-                F.when(F.expr("(doc_id div 30) % 2") == 0,
-                       F.lit("alpha")).otherwise(F.lit("Alpha")),
-                F.lit(" beta gamma delta five six seven eight nine ten"
-                      " tail"),
-                (F.col("doc_id") % 7).cast("string"),
-            ),
-        ).otherwise(F.col("text")).alias("body"),
-    )
-    d = src.select(
-        "doc_id",
-        F.md5("body").alias("h_exact"),
-        F.md5(
-            F.lower(F.regexp_replace(
-                F.regexp_replace("body", "[^a-zA-Z0-9]+", " "),
-                " +", " "))
-        ).alias("h_norm"),
-        F.md5(F.array_join(F.slice(F.split("body", " "), 1, 8), " "))
-        .alias("h_prefix"),
-    )
-    fe = d.groupBy("h_exact").agg(F.min("doc_id").alias("ke"))
-    fn = d.groupBy("h_norm").agg(F.min("doc_id").alias("kn"))
-    fp = d.groupBy("h_prefix").agg(F.min("doc_id").alias("kp"))
-    m = (
-        d.join(fe, "h_exact").join(fn, "h_norm").join(fp, "h_prefix")
-        .select(
-            F.when(F.col("ke") < F.col("doc_id"), 1).otherwise(0)
-            .alias("dup_e"),
-            F.when(F.col("kn") < F.col("doc_id"), 1).otherwise(0)
-            .alias("dup_n"),
-            F.when(F.col("kp") < F.col("doc_id"), 1).otherwise(0)
-            .alias("dup_p"),
-        )
-    )
-    return m.groupBy(
-        F.col("dup_e").alias("dup_exact"),
-        F.col("dup_n").alias("dup_normalized"),
-        F.col("dup_p").alias("dup_prefix"),
-    ).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(
-            F.when((F.col("dup_e") == 0) & (F.col("dup_n") == 0)
-                   & (F.col("dup_p") == 0), 1).otherwise(0)
-        ).cast("long").alias("n_keep"),
-    )
-
-
-# --- license propagation through dup clusters (q358) --------------------------
-
-
-@query(
-    "q358_license_propagation",
-    """WITH d AS (SELECT doc_id,
-                    md5(CASE WHEN doc_id % 11 = 0
-                        THEN 'shared licensed body' ELSE text END) AS h,
-                    CASE WHEN doc_id % 44 = 0 THEN 1 ELSE 0 END
-                      AS flagged_src
-                  FROM documents),
-       cl AS (SELECT h, max(flagged_src) AS any_flagged,
-                     count(*) AS cluster_size
-              FROM d GROUP BY h)
-       SELECT d.doc_id,
-              CAST(d.flagged_src AS BIGINT) AS flagged_src,
-              CAST(cl.any_flagged AS BIGINT) AS flagged_effective,
-              CAST(cl.cluster_size AS BIGINT) AS cluster_size
-       FROM d JOIN cl USING (h)
-       WHERE cl.any_flagged = 1 OR d.flagged_src = 1""",
-)
-def q358(spark, sf_dir):
-    """License/compliance propagation through duplicate clusters —
-    if ANY copy of a text carries a restrictive license or takedown
-    flag, EVERY copy inherits it (content rights attach to the
-    work, not the URL): exact-hash clusters take the max flag and
-    every member reads the cluster verdict.  The planted template on
-    doc_id%11==0 forms one big cluster; flags originate on the
-    doc_id%44==0 subset, so most flagged_effective rows have
-    flagged_src=0 — inheritance doing the work.  One hash groupBy +
-    one equi-join back; at corpus scale this runs as part of the
-    dedup pass for free."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        F.md5(
-            F.when(F.col("doc_id") % 11 == 0, F.lit("shared licensed body"))
-            .otherwise(F.col("text"))
-        ).alias("h"),
-        F.when(F.col("doc_id") % 44 == 0, 1).otherwise(0)
-        .alias("flagged_src"),
-    )
-    cl = d.groupBy("h").agg(
-        F.max("flagged_src").alias("any_flagged"),
-        F.count("*").alias("cluster_size"),
-    )
-    return (
-        d.join(cl, "h")
-        .filter((F.col("any_flagged") == 1) | (F.col("flagged_src") == 1))
-        .select(
-            "doc_id",
-            F.col("flagged_src").cast("long").alias("flagged_src"),
-            F.col("any_flagged").cast("long").alias("flagged_effective"),
-            F.col("cluster_size").cast("long").alias("cluster_size"),
-        )
-    )
-
-
-# --- redirect/canonical chain resolution (q359) -------------------------------
-
-
-@query(
-    "q359_redirect_resolution",
-    """WITH f AS (SELECT doc_id AS src,
-                    CASE WHEN doc_id % 97 = 95 THEN doc_id + 1
-                         WHEN doc_id % 97 = 96 THEN doc_id - 1
-                         WHEN doc_id % 3 = 0 AND doc_id % 97 < 95
-                              THEN (doc_id // 3) * 3 + 300
-                         ELSE doc_id END AS nxt
-                  FROM documents),
-       uni AS (SELECT src, CASE WHEN nxt IN (SELECT src FROM f)
-                                THEN nxt ELSE src END AS nxt
-               FROM f),
-       j1 AS (SELECT a.src, b.nxt FROM uni a JOIN uni b
-              ON b.src = a.nxt),
-       j2 AS (SELECT a.src, b.nxt FROM j1 a JOIN j1 b
-              ON b.src = a.nxt),
-       j3 AS (SELECT a.src, b.nxt FROM j2 a JOIN j2 b
-              ON b.src = a.nxt),
-       res AS (SELECT j3.src, j3.nxt AS target,
-                      CASE WHEN u.nxt = j3.nxt THEN 0 ELSE 1 END
-                        AS in_loop
-               FROM j3 JOIN uni u ON u.src = j3.nxt)
-       SELECT src, CAST(target AS BIGINT) AS target,
-              CAST(in_loop AS BIGINT) AS in_loop
-       FROM res WHERE src <> target OR in_loop = 1""",
-)
-def q359(spark, sf_dir):
-    """Redirect/canonical chain resolution with LOOP detection — the
-    crawl-side URL canonicalization that must terminate even on
-    misconfigured sites: a functional next-hop graph (every third
-    page redirects toward a hub; a planted 2-cycle on doc_id%97 in
-    {95,96} models the classic A<->B redirect loop), resolved by
-    THREE pointer-doubling jumps (depth 8 — chains here are <= 2
-    hops; the doubling count is log2(max depth), the q94/q33 CC
-    contract) with off-graph targets self-absorbed; a page whose
-    depth-8 pointer still MOVES is in a loop and flagged instead of
-    resolved.  Emitted: every redirected page's final target or loop
-    flag."""
-    docs = _t(spark, sf_dir, "documents")
-    f = docs.selectExpr(
-        "doc_id AS src",
-        """CASE WHEN doc_id % 97 = 95 THEN doc_id + 1
-                WHEN doc_id % 97 = 96 THEN doc_id - 1
-                WHEN doc_id % 3 = 0 AND doc_id % 97 < 95
-                     THEN (doc_id div 3) * 3 + 300
-                ELSE doc_id END AS nxt""",
-    )
-    srcs = f.select(F.col("src").alias("s2")).distinct()
-    uni = (
-        f.join(srcs, f.nxt == F.col("s2"), "left")
-        .select(
-            "src",
-            F.when(F.col("s2").isNotNull(), F.col("nxt"))
-            .otherwise(F.col("src")).alias("nxt"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    j = uni
-    for _ in range(3):
-        b = j.selectExpr("src AS bs", "nxt AS bn")
-        j = (
-            j.join(b, j.nxt == F.col("bs"))
-            .select("src", F.col("bn").alias("nxt"))
-            .localCheckpoint(eager=True)
-        )
-    res = (
-        j.join(uni.selectExpr("src AS ts", "nxt AS tn"),
-               j.nxt == F.col("ts"))
-        .select(
-            "src", F.col("nxt").alias("target"),
-            F.when(F.col("tn") == F.col("nxt"), 0).otherwise(1)
-            .alias("in_loop"),
-        )
-    )
-    return res.filter(
-        (F.col("src") != F.col("target")) | (F.col("in_loop") == 1)
-    ).select(
-        "src",
-        F.col("target").cast("long").alias("target"),
-        F.col("in_loop").cast("long").alias("in_loop"),
-    )
-
-
-# --- hreflang symmetry audit (q360) -------------------------------------------
-
-
-@query(
-    "q360_hreflang_symmetry",
-    """WITH decl AS (SELECT doc_id AS a,
-                       (doc_id + 250) % 500 AS b
-                     FROM documents WHERE doc_id % 2 = 0
-                     UNION ALL
-                     SELECT doc_id, (doc_id + 250) % 500
-                     FROM documents
-                     WHERE doc_id % 2 = 1 AND doc_id % 7 <> 1),
-       sym AS (SELECT d.a, d.b,
-                      CASE WHEN r.a IS NOT NULL THEN 1 ELSE 0 END
-                        AS reciprocated
-               FROM decl d LEFT JOIN decl r
-                 ON r.a = d.b AND r.b = d.a)
-       SELECT CAST(a % 10 AS BIGINT) AS bucket,
-              CAST(count(*) AS BIGINT) AS n_declared,
-              CAST(sum(reciprocated) AS BIGINT) AS n_reciprocated,
-              CAST(count(*) - sum(reciprocated) AS BIGINT) AS n_broken
-       FROM sym GROUP BY a % 10""",
-)
-def q360(spark, sf_dir):
-    """hreflang symmetry audit — the SEO/i18n correctness check
-    (language-alternate annotations must be RECIPROCAL; a one-way
-    declaration is ignored by crawlers and silently loses the
-    pairing): the declared alternate-pair table self-joins reversed,
-    and unreciprocated declarations are counted per bucket.  Odd
-    pages with doc_id%7==1 deliberately omit their back-declaration,
-    so ~7% of pairs break — the audit localizes exactly those.  One
-    self-equi-join on the (b, a) key — the q257 reciprocity shape
-    applied to annotation QA."""
-    docs = _t(spark, sf_dir, "documents")
-    even = docs.filter(F.col("doc_id") % 2 == 0).selectExpr(
-        "doc_id AS a", "(doc_id + 250) % 500 AS b")
-    odd = docs.filter(
-        (F.col("doc_id") % 2 == 1) & (F.col("doc_id") % 7 != 1)
-    ).selectExpr("doc_id AS a", "(doc_id + 250) % 500 AS b")
-    decl = even.unionAll(odd).localCheckpoint(eager=True)
-    r = decl.selectExpr("a AS rb", "b AS ra")
-    sym = decl.join(
-        r, (F.col("ra") == F.col("a")) & (F.col("rb") == F.col("b")),
-        "left",
-    ).select(
-        "a", "b",
-        F.when(F.col("ra").isNotNull(), 1).otherwise(0)
-        .alias("reciprocated"),
-    )
-    return sym.groupBy((F.col("a") % 10).alias("bucket")).agg(
-        F.count("*").cast("long").alias("n_declared"),
-        F.sum("reciprocated").cast("long").alias("n_reciprocated"),
-        (F.count("*") - F.sum("reciprocated")).cast("long")
-        .alias("n_broken"),
-    )
-
-
-# --- index shard-merge reconciliation (q361) ----------------------------------
-
-
-@query(
-    "q361_index_shard_merge",
-    """WITH p AS (SELECT DISTINCT word, doc_id FROM
-                    (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                     FROM documents)),
-       sa AS (SELECT word, count(*) AS df_a FROM p
-              WHERE doc_id % 2 = 0 GROUP BY word),
-       sb AS (SELECT word, count(*) AS df_b FROM p
-              WHERE doc_id % 2 = 1 GROUP BY word),
-       g AS (SELECT word, count(*) AS df_g FROM p GROUP BY word)
-       SELECT g.word,
-              CAST(coalesce(sa.df_a, 0) AS BIGINT) AS df_shard_a,
-              CAST(coalesce(sb.df_b, 0) AS BIGINT) AS df_shard_b,
-              CAST(g.df_g AS BIGINT) AS df_merged,
-              CAST(CASE WHEN coalesce(sa.df_a, 0) + coalesce(sb.df_b, 0)
-                             = g.df_g THEN 1 ELSE 0 END AS BIGINT)
-                AS merge_consistent
-       FROM g LEFT JOIN sa USING (word) LEFT JOIN sb USING (word)""",
-)
-def q361(spark, sf_dir):
-    """Index shard-merge reconciliation — the correctness audit run
-    after merging per-shard partial indexes (doc-partitioned shards
-    mean per-term df must ADD exactly; any inconsistency pinpoints a
-    doc double-indexed or dropped at the shard boundary): per term,
-    both shard dfs, the merged df, and the exact additivity flag.
-    Three postings aggregations sharing one scan — the audit every
-    segment-merge (Lucene-style) runs before swapping the new
-    segment in; at 10^12 postings the reconciliation is
-    term-sharded and combinable."""
-    docs = _t(spark, sf_dir, "documents")
-    p = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .distinct()
-    )
-    sa = p.filter(F.col("doc_id") % 2 == 0).groupBy("word").agg(
-        F.count("*").alias("df_a"))
-    sb = p.filter(F.col("doc_id") % 2 == 1).groupBy("word").agg(
-        F.count("*").alias("df_b"))
-    g = p.groupBy("word").agg(F.count("*").alias("df_g"))
-    return (
-        g.join(sa, "word", "left").join(sb, "word", "left")
-        .select(
-            "word",
-            F.coalesce("df_a", F.lit(0)).cast("long").alias("df_shard_a"),
-            F.coalesce("df_b", F.lit(0)).cast("long").alias("df_shard_b"),
-            F.col("df_g").cast("long").alias("df_merged"),
-            F.when(
-                F.coalesce("df_a", F.lit(0)) + F.coalesce("df_b", F.lit(0))
-                == F.col("df_g"), 1,
-            ).otherwise(0).cast("long").alias("merge_consistent"),
-        )
-    )
-
-
-# --- snippet highlight char offsets (q362) ------------------------------------
-
-
-@query(
-    "q362_highlight_offsets",
-    """WITH s AS (SELECT doc_id, string_split(text, ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q362 oracle range bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       hits AS (SELECT doc_id, r.range AS pos,
-                       CASE WHEN r.range = 1 THEN 0
-                            ELSE len(array_to_string(
-                                   w[1:r.range - 1], ' ')) + 1 END
-                         AS char_start
-                FROM s, range(1, 200) r
-                WHERE r.range <= len(w) AND w[r.range] = 'merge')
-       SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-              CAST(char_start AS BIGINT) AS char_start,
-              CAST(char_start + 5 AS BIGINT) AS char_end
-       FROM hits, chk""",
-)
-def q362(spark, sf_dir):
-    """Snippet highlight character offsets — the serving-UI detail
-    that turns a match position into <em> byte ranges: for every
-    occurrence of the probe term, the exact character offset (length
-    of the joined prefix words + one separator; position 1 starts at
-    0) and the end offset.  Derived entirely from the SAME split the
-    tokenizer used, so offsets can never drift from tokenization —
-    the invariant highlighters break when they re-tokenize.
-    Per-row linear array work at scan speed (the q295 KWIC shape
-    emitting offsets instead of windows)."""
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select("doc_id", F.split("text", " ").alias("w"))
-    hits = s.select(
-        "doc_id",
-        F.explode(
-            F.expr("filter(sequence(1, size(w)), i -> w[i - 1] = 'merge')")
-        ).alias("pos"),
-        "w",
-    ).select(
-        "doc_id", "pos",
-        F.when(F.col("pos") == 1, 0).otherwise(
-            F.length(
-                F.array_join(
-                    F.expr("slice(w, 1, CAST(pos AS INT) - 1)"), " ")
-            ) + 1
-        ).alias("char_start"),
-    )
-    return hits.select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.col("char_start").cast("long").alias("char_start"),
-        (F.col("char_start") + 5).cast("long").alias("char_end"),
-    )
-
-
-# --- weak-supervision label vote (q363) ---------------------------------------
-
-
-@query(
-    "q363_weak_supervision_vote",
-    """WITH f AS (SELECT doc_id,
-                    CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS r_len,
-                    CASE WHEN len(list_filter(string_split(text, ' '),
-                           x -> x IN ('the', 'and', 'of', 'a'))) >= 2
-                         THEN 1 ELSE 0 END AS r_stop,
-                    CASE WHEN lang IN ('en', 'es', 'de', 'fr')
-                         THEN 1 ELSE 0 END AS r_lang
-                  FROM documents),
-       v AS (SELECT doc_id, r_len, r_stop, r_lang,
-                    r_len + r_stop + r_lang AS votes
-             FROM f)
-       SELECT CAST(votes AS BIGINT) AS votes,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(CASE WHEN votes >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_keep,
-              CAST(sum(CASE WHEN r_len = r_stop AND r_stop = r_lang
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_unanimous
-       FROM v GROUP BY votes""",
-)
-def q363(spark, sf_dir):
-    """Weak-supervision label vote (Snorkel-lite) — three cheap
-    labeling functions (length, stopword presence, language
-    allowlist) combined by MAJORITY VOTE, with the per-vote-level
-    histogram and unanimity counts that diagnose labeling-function
-    agreement (the number the label-model's learned weights replace).
-    One projection + one rollup, all rules exact integer tests —
-    the shape under every programmatic-labeling pipeline before a
-    trained model exists."""
-    docs = _t(spark, sf_dir, "documents")
-    f = docs.select(
-        "doc_id",
-        F.when(F.col("n_chars") >= 200, 1).otherwise(0).alias("r_len"),
-        F.when(
-            F.size(F.filter(
-                F.split("text", " "),
-                lambda x: x.isin("the", "and", "of", "a"))) >= 2, 1,
-        ).otherwise(0).alias("r_stop"),
-        F.when(F.col("lang").isin("en", "es", "de", "fr"), 1).otherwise(0)
-        .alias("r_lang"),
-    )
-    v = f.select(
-        "doc_id", "r_len", "r_stop", "r_lang",
-        (F.col("r_len") + F.col("r_stop") + F.col("r_lang")).alias("votes"),
-    )
-    return v.groupBy("votes").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum(F.when(F.col("votes") >= 2, 1).otherwise(0)).cast("long")
-        .alias("n_keep"),
-        F.sum(
-            F.when((F.col("r_len") == F.col("r_stop"))
-                   & (F.col("r_stop") == F.col("r_lang")), 1).otherwise(0)
-        ).cast("long").alias("n_unanimous"),
-    ).select(
-        F.col("votes").cast("long").alias("votes"),
-        "n_docs", "n_keep", "n_unanimous",
-    )
-
-
-# --- web release pipeline rollup (q364) ---------------------------------------
-
-
-@query(
-    "q364_release_pipeline",
-    """WITH d AS (SELECT doc_id, source, text, lang, n_chars,
-                         md5(text) AS h,
-                         len(string_split(text, ' ')) AS lw
-                  FROM documents),
-       gated AS (SELECT *,
-                   CASE WHEN n_chars >= 150 AND lang IN ('en', 'es')
-                        THEN 1 ELSE 0 END AS pass_gate
-                 FROM d),
-       keep AS (SELECT g.*, 
-                       CASE WHEN g.pass_gate = 1 AND k.keeper = g.doc_id
-                            THEN 1 ELSE 0 END AS kept
-               FROM gated g LEFT JOIN
-                 (SELECT h, min(doc_id) AS keeper FROM gated
-                  WHERE pass_gate = 1 GROUP BY h) k ON k.h = g.h)
-       SELECT source,
-              CAST(count(*) AS BIGINT) AS docs_in,
-              CAST(sum(pass_gate) AS BIGINT) AS docs_after_gate,
-              CAST(sum(kept) AS BIGINT) AS docs_released,
-              CAST(sum(CASE WHEN kept = 1
-                       THEN (lw + 14) // 15 ELSE 0 END) AS BIGINT)
-                AS n_passages
-       FROM keep GROUP BY source""",
-)
-def q364(spark, sf_dir):
-    """Web release pipeline rollup — gate -> dedup -> chunk in ONE
-    composed plan per source (the q146 training-pipeline pattern on
-    the release side): the quality gate (length + language), the
-    exact-dedup keeper decision applied ONLY among gated docs (the
-    keeper must be a released doc, not a rejected one — the ordering
-    bug release pipelines actually hit), and the q302-stride passage
-    count ceil(words/15) for what ships.  One scan + one hash
-    groupBy + one source rollup — the per-source release dashboard
-    row."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", "source", "lang", "n_chars",
-        F.md5("text").alias("h"),
-        F.size(F.split("text", " ")).alias("lw"),
-    )
-    gated = d.withColumn(
-        "pass_gate",
-        F.when((F.col("n_chars") >= 150)
-               & (F.col("lang").isin("en", "es")), 1).otherwise(0),
-    )
-    k = (
-        gated.filter(F.col("pass_gate") == 1)
-        .groupBy("h").agg(F.min("doc_id").alias("keeper"))
-    )
-    keep = gated.join(k, "h", "left").withColumn(
-        "kept",
-        F.when((F.col("pass_gate") == 1)
-               & (F.col("keeper") == F.col("doc_id")), 1).otherwise(0),
-    )
-    return keep.groupBy("source").agg(
-        F.count("*").cast("long").alias("docs_in"),
-        F.sum("pass_gate").cast("long").alias("docs_after_gate"),
-        F.sum("kept").cast("long").alias("docs_released"),
-        F.sum(
-            F.when(F.col("kept") == 1,
-                   F.expr("(lw + 14) div 15")).otherwise(0)
-        ).cast("long").alias("n_passages"),
-    )
-
-
-# --- binary-quantized embedding recall (q365) ---------------------------------
-
-
-@query(
-    "q365_binary_embedding_recall",
-    """WITH v AS (SELECT vec_id, list_transform(embedding,
-                    x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                    AS qv
-             FROM embeddings),
-       bits AS (SELECT vec_id,
-                  CAST(list_sum(list_transform(range(1, 33),
-                    i -> CASE WHEN qv[i] > 0
-                         THEN CAST(1 AS BIGINT) << CAST(i - 1 AS INT)
-                         ELSE 0 END)) AS BIGINT) AS b_lo,
-                  CAST(list_sum(list_transform(range(33, 65),
-                    i -> CASE WHEN qv[i] > 0
-                         THEN CAST(1 AS BIGINT) << CAST(i - 33 AS INT)
-                         ELSE 0 END)) AS BIGINT) AS b_hi
-                FROM v),
-       q AS (SELECT vec_id AS qid, qv AS qqv FROM v
-             WHERE vec_id % 10 = 0),
-       qb AS (SELECT b.vec_id AS qid, b.b_lo AS q_lo, b.b_hi AS q_hi
-              FROM bits b WHERE b.vec_id % 10 = 0),
-       pr AS (SELECT q.qid, v.vec_id AS cand,
-                 CAST(list_sum(list_transform(list_zip(q.qqv, v.qv),
-                      s -> s[1]*s[2])) AS BIGINT) AS dot_full
-              FROM q JOIN v ON v.vec_id <> q.qid),
-       ph AS (SELECT qb.qid, b.vec_id AS cand,
-                     bit_count(xor(qb.q_lo, b.b_lo))
-                     + bit_count(xor(qb.q_hi, b.b_hi)) AS hamming
-              FROM qb JOIN bits b ON b.vec_id <> qb.qid),
-       rf AS (SELECT qid, cand,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY dot_full DESC, cand ASC) AS rnk
-              FROM pr),
-       rb AS (SELECT qid, cand,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY hamming ASC, cand ASC) AS rnk
-              FROM ph)
-       SELECT rf.qid, CAST(count(rb.cand) AS BIGINT) AS overlap5
-       FROM rf LEFT JOIN rb
-         ON rb.qid = rf.qid AND rb.cand = rf.cand AND rb.rnk <= 5
-       WHERE rf.rnk <= 5
-       GROUP BY rf.qid""",
-)
-def q365(spark, sf_dir):
-    """Binary-quantized (1-bit) embedding recall@5 — the 32x-
-    compression tier every vector store now ships (sign-bit vectors,
-    Hamming distance ranking): each 64-dim vector packs its sign
-    bits into two 32-bit halves, candidates rank by
-    bit_count(xor) Hamming (ties to lowest id) and the overlap with
-    the exact integer-dot top-5 measures what 1-bit quantization
-    keeps.  The complement of q292's dimension truncation — together
-    they bracket the memory/recall tradeoff surface; same
-    per-query ranking-window caveat (IVF-prefiltered at scale)."""
-    v = _t(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qv",
-    )
-    bits = v.selectExpr(
-        "vec_id",
-        "CAST(aggregate(transform(sequence(1, 32), "
-        "i -> CASE WHEN qv[i - 1] > 0 THEN shiftleft(CAST(1 AS BIGINT), "
-        "CAST(i - 1 AS INT)) ELSE CAST(0 AS BIGINT) END), "
-        "CAST(0 AS BIGINT), (a, x) -> a + x) AS BIGINT) AS b_lo",
-        "CAST(aggregate(transform(sequence(33, 64), "
-        "i -> CASE WHEN qv[i - 1] > 0 THEN shiftleft(CAST(1 AS BIGINT), "
-        "CAST(i - 33 AS INT)) ELSE CAST(0 AS BIGINT) END), "
-        "CAST(0 AS BIGINT), (a, x) -> a + x) AS BIGINT) AS b_hi",
-    ).localCheckpoint(eager=True)
-    q = v.filter("vec_id % 10 = 0").selectExpr("vec_id AS qid", "qv AS qqv")
-    qb = bits.filter("vec_id % 10 = 0").selectExpr(
-        "vec_id AS qid", "b_lo AS q_lo", "b_hi AS q_hi")
-    pr = (
-        F.broadcast(q).join(v, F.col("vec_id") != F.col("qid"))
-        .selectExpr(
-            "qid", "vec_id AS cand",
-            "CAST(aggregate(zip_with(qqv, qv, (a, b) -> a * b), "
-            "CAST(0 AS BIGINT), (acc, s) -> acc + s) AS BIGINT) "
-            "AS dot_full",
-        )
-    )
-    ph = (
-        F.broadcast(qb).join(bits, F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", F.col("vec_id").alias("cand"),
-            (
-                F.bit_count(F.expr("q_lo ^ b_lo"))
-                + F.bit_count(F.expr("q_hi ^ b_hi"))
-            ).alias("hamming"),
-        )
-    )
-    wf = Window.partitionBy("qid").orderBy(
-        F.col("dot_full").desc(), F.col("cand").asc())
-    wb = Window.partitionBy("qid").orderBy(
-        F.col("hamming").asc(), F.col("cand").asc())
-    rf = pr.select("qid", "cand", F.row_number().over(wf).alias("rnk"))
-    rb = ph.select("qid", "cand", F.row_number().over(wb).alias("rnk"))
-    rbs = rb.filter(F.col("rnk") <= 5).select(
-        F.col("qid").alias("tqid"), F.col("cand").alias("tcand"))
-    return (
-        rf.filter(F.col("rnk") <= 5)
-        .join(rbs, (F.col("qid") == F.col("tqid"))
-              & (F.col("cand") == F.col("tcand")), "left")
-        .groupBy("qid")
-        .agg(F.count("tcand").cast("long").alias("overlap5"))
-    )
-
-
-# --- shuffle-skew diagnostics report (q366) -----------------------------------
-
-
-@query(
-    "q366_skew_report",
-    """WITH hostg AS (SELECT 'host' AS key_family, doc_id % 40 AS k
-                      FROM documents),
-       wordg AS (SELECT 'word' AS key_family, NULL AS k FROM documents
-                 WHERE FALSE),
-       words AS (SELECT 'word' AS key_family,
-                        CAST(NULL AS BIGINT) AS k,
-                        word FROM
-                   (SELECT unnest(string_split(text, ' ')) AS word
-                    FROM documents)),
-       g AS (SELECT key_family, CAST(k AS VARCHAR) AS key FROM hostg
-             UNION ALL
-             SELECT key_family, word FROM words
-             UNION ALL
-             SELECT 'user', CAST(user_id AS VARCHAR) FROM events),
-       c AS (SELECT key_family, key, count(*) AS c FROM g
-             GROUP BY key_family, key)
-       SELECT key_family,
-              CAST(count(*) AS BIGINT) AS n_keys,
-              CAST(sum(c) AS BIGINT) AS n_rows,
-              CAST(max(c) AS BIGINT) AS max_group,
-              CAST(CASE WHEN max(c) * count(*) >= 4 * sum(c)
-                        THEN 1 ELSE 0 END AS BIGINT) AS is_skewed
-       FROM c GROUP BY key_family""",
-)
-def q366(spark, sf_dir):
-    """Shuffle-skew diagnostics report — the meta-query a platform
-    team runs BEFORE picking join/aggregation strategies (the number
-    behind this repo's own salting ladder, operators/spatial_join):
-    for each shuffle-key family (host, word, user), key count, row
-    count, hottest group, and the exact cross-multiplied skew flag
-    max*keys >= 4*rows (hottest group >= 4x the mean — the point
-    where AQE alone leaves stragglers and explicit salting pays).
-    Three groupBys sharing scans, one row per family — the skew
-    report that turns 'the job is slow' into 'salt the word key'."""
-    docs = _t(spark, sf_dir, "documents")
-    ev = _t(spark, sf_dir, "events")
-    hostg = docs.selectExpr("'host' AS key_family",
-                            "CAST(doc_id % 40 AS STRING) AS key")
-    words = docs.select(
-        F.lit("word").alias("key_family"),
-        F.explode(F.split("text", " ")).alias("key"),
-    )
-    users = ev.selectExpr("'user' AS key_family",
-                          "CAST(user_id AS STRING) AS key")
-    g = hostg.unionByName(words).unionByName(users)
-    c = g.groupBy("key_family", "key").agg(F.count("*").alias("c"))
-    return c.groupBy("key_family").agg(
-        F.count("*").cast("long").alias("n_keys"),
-        F.sum("c").cast("long").alias("n_rows"),
-        F.max("c").cast("long").alias("max_group"),
-        F.when(F.max("c") * F.count("*") >= 4 * F.sum("c"), 1)
-        .otherwise(0).cast("long").alias("is_skewed"),
-    )
-
-
-# --- duplicate-aware effective tokens (q367) ----------------------------------
-
-
-@query(
-    "q367_effective_tokens",
-    """WITH d AS (SELECT doc_id, source,
-                    md5(text) AS h,
-                    len(string_split(text, ' ')) AS lw
-                  FROM documents),
-       k AS (SELECT h, min(doc_id) AS keeper FROM d GROUP BY h)
-       SELECT d.source,
-              CAST(sum(d.lw) AS BIGINT) AS raw_tokens,
-              CAST(sum(CASE WHEN k.keeper = d.doc_id THEN d.lw ELSE 0 END)
-                AS BIGINT) AS effective_tokens,
-              CAST(sum(CASE WHEN k.keeper <> d.doc_id THEN d.lw ELSE 0 END)
-                AS BIGINT) AS duplicated_tokens
-       FROM d JOIN k USING (h)
-       GROUP BY d.source""",
-)
-def q367(spark, sf_dir):
-    """Duplicate-aware EFFECTIVE token accounting — the number
-    dataset papers actually report (raw token counts overstate a
-    corpus whose duplicates will be dropped; epochs-over-effective-
-    tokens is what the scaling laws consume): per source, raw vs
-    keeper-only vs duplicated tokens under the exact md5 dedup key.
-    One hash groupBy + one source rollup sharing a scan — the
-    datasheet (q348) column that changes once dedup runs."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", "source",
-        F.md5("text").alias("h"),
-        F.size(F.split("text", " ")).alias("lw"),
-    )
-    k = d.groupBy("h").agg(F.min("doc_id").alias("keeper"))
-    return d.join(k, "h").groupBy("source").agg(
-        F.sum("lw").cast("long").alias("raw_tokens"),
-        F.sum(F.when(F.col("keeper") == F.col("doc_id"), F.col("lw"))
-              .otherwise(0)).cast("long").alias("effective_tokens"),
-        F.sum(F.when(F.col("keeper") != F.col("doc_id"), F.col("lw"))
-              .otherwise(0)).cast("long").alias("duplicated_tokens"),
-    )
-
-
-# --- leakage-safe split assignment (q368) -------------------------------------
-
-
-@query(
-    "q368_leakage_safe_splits",
-    """WITH d AS (SELECT doc_id,
-                    md5(CASE WHEN doc_id % 15 = 9
-                        THEN 'shared template body for ingest dedup'
-                        ELSE text END) AS h
-                  FROM documents),
-       asg AS (SELECT doc_id, h,
-                 CASE CAST(CAST('0x' || substr(md5('split:' || h), 1, 8)
-                      AS UBIGINT) % 10 AS BIGINT)
-                   WHEN 0 THEN 'test' WHEN 1 THEN 'val'
-                   ELSE 'train' END AS split
-               FROM d),
-       leak AS (SELECT h, count(DISTINCT split) AS n_splits,
-                       count(*) AS grp
-                FROM asg GROUP BY h)
-       SELECT asg.split,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(count(DISTINCT asg.h) AS BIGINT) AS n_groups,
-              CAST(max(leak.n_splits) AS BIGINT) AS max_splits_per_group
-       FROM asg JOIN leak USING (h)
-       GROUP BY asg.split""",
-)
-def q368(spark, sf_dir):
-    """Leakage-safe train/val/test split assignment — splits keyed
-    on the CONTENT HASH, never the doc id, so exact duplicates land
-    in the SAME split by construction (doc-id splits leak dup
-    content from train into test, silently inflating eval):
-    split = md5('split:'||h) % 10 (8/1/1), and the audit column
-    max_splits_per_group == 1 PROVES no hash straddles splits —
-    emitted, not assumed.  The q303 planted template group (docs
-    9, 24, 39, ...) all land together.  One hash groupBy + one
-    rollup; the assignment is a pure deterministic projection at
-    any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        F.md5(
-            F.when(F.col("doc_id") % 15 == 9,
-                   F.lit("shared template body for ingest dedup"))
-            .otherwise(F.col("text"))
-        ).alias("h"),
-    )
-    slot = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split:"), F.col("h"))), 1, 8),
-            16, 10,
-        ).cast("long") % 10
-    )
-    asg = d.select(
-        "doc_id", "h",
-        F.when(slot == 0, "test").when(slot == 1, "val")
-        .otherwise("train").alias("split"),
-    )
-    leak = asg.groupBy("h").agg(
-        F.countDistinct("split").alias("n_splits"))
-    return asg.join(leak, "h").groupBy("split").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.countDistinct("h").cast("long").alias("n_groups"),
-        F.max("n_splits").cast("long").alias("max_splits_per_group"),
-    )
-
-
-# --- view dwell-time distribution (q369) --------------------------------------
-
-
-@query(
-    "q369_view_dwell_time",
-    """WITH v AS (SELECT event_id, user_id,
-                    CAST(floor(epoch(ts)) AS BIGINT) AS es
-                  FROM events WHERE event_type = 'view'),
-       nxt AS (SELECT v.event_id,
-                      min(CAST(floor(epoch(e.ts)) AS BIGINT)) AS next_es
-               FROM v JOIN events e
-                 ON e.user_id = v.user_id
-                AND CAST(floor(epoch(e.ts)) AS BIGINT) > v.es
-               GROUP BY v.event_id),
-       dt AS (SELECT v.event_id, nxt.next_es - v.es AS dwell
-              FROM v JOIN nxt USING (event_id))
-       SELECT CAST(length(bin(dwell)) AS BIGINT) AS log2_bucket,
-              CAST(count(*) AS BIGINT) AS n_views,
-              CAST(min(dwell) AS BIGINT) AS min_s,
-              CAST(max(dwell) AS BIGINT) AS max_s
-       FROM dt GROUP BY length(bin(dwell))""",
-)
-def q369(spark, sf_dir):
-    """View dwell-time distribution — seconds from a view to the
-    SAME user's next event (the engagement proxy behind quality
-    ranking when真 dwell isn't instrumented): the next-event time is
-    the as-of-forward min over the user's later events (combinable
-    min, the q334 as-of idiom mirrored forward), histogrammed into
-    the q294/q336 power-of-two buckets with visible bucket-edge
-    min/max.  The user-keyed join carries the shuffle; the histogram
-    is mergeable for the stream tier."""
-    e = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type",
-        F.unix_timestamp("ts").alias("es"),
-    )
-    v = e.filter(F.col("event_type") == "view").select(
-        "event_id", "user_id", "es")
-    other = e.select("user_id", F.col("es").alias("oes"))
-    nxt = (
-        v.join(other, "user_id")
-        .filter(F.col("oes") > F.col("es"))
-        .groupBy("event_id", "es")
-        .agg(F.min("oes").alias("next_es"))
-    )
-    dt = nxt.select((F.col("next_es") - F.col("es")).alias("dwell"))
-    return dt.groupBy(
-        F.length(F.bin("dwell")).cast("long").alias("log2_bucket")
-    ).agg(
-        F.count("*").cast("long").alias("n_views"),
-        F.min("dwell").cast("long").alias("min_s"),
-        F.max("dwell").cast("long").alias("max_s"),
-    )
-
-
-# --- term-dictionary range-partition planning (q370) --------------------------
-
-
-@query(
-    "q370_term_range_partitions",
-    """WITH p AS (SELECT word, count(*) AS postings FROM
-                    (SELECT DISTINCT doc_id,
-                            unnest(string_split(text, ' ')) AS word
-                     FROM documents)
-                  GROUP BY word),
-       t AS (SELECT sum(postings) AS tot FROM p),
-       cum AS (SELECT a.word, a.postings, sum(b.postings) AS cum
-               FROM p a JOIN p b ON b.word <= a.word
-               GROUP BY a.word, a.postings),
-       parts AS (SELECT cum.word, cum.postings,
-                        least(CAST((cum.cum - 1) * 4 // t.tot AS BIGINT),
-                              3) AS part
-                 FROM cum CROSS JOIN t)
-       SELECT part,
-              CAST(count(*) AS BIGINT) AS n_terms,
-              CAST(sum(postings) AS BIGINT) AS postings,
-              min(word) AS first_term,
-              max(word) AS last_term
-       FROM parts GROUP BY part""",
-)
-def q370(spark, sf_dir):
-    """Term-dictionary range-partition planning — the boundary table
-    a range-partitioned index build computes before writing segments
-    (lexicographic term ranges with near-equal POSTING mass, not
-    equal term counts — hot terms dominate bytes): cumulative
-    posting mass in lex order (triangular join over the BOUNDED
-    lexicon — never a corpus window), partition = floor((cum-1)*P /
-    total) clamped, per-partition term ranges and masses emitted.
-    This is the deterministic analogue of repartitionByRange's
-    sampled boundaries (the q236 determinism contract: sampling is
-    per-execution, value-derived boundaries are not)."""
-    docs = _t(spark, sf_dir, "documents")
-    p = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .distinct()
-        .groupBy("word").agg(F.count("*").alias("postings"))
-    )
-    t = p.agg(F.sum("postings").alias("tot"))
-    b = p.selectExpr("word AS bw", "postings AS bp")
-    cum = (
-        p.join(F.broadcast(b), F.col("bw") <= F.col("word"))
-        .groupBy("word", "postings").agg(F.sum("bp").alias("cum"))
-    )
-    parts = cum.crossJoin(F.broadcast(t)).select(
-        "word", "postings",
-        F.least(F.expr("CAST((cum - 1) * 4 div tot AS BIGINT)"),
-                F.lit(3)).alias("part"),
-    )
-    return parts.groupBy("part").agg(
-        F.count("*").cast("long").alias("n_terms"),
-        F.sum("postings").cast("long").alias("postings"),
-        F.min("word").alias("first_term"),
-        F.max("word").alias("last_term"),
-    )
-
-
-# --- LRU stack-distance cache curve (q371) -------------------------------------
-
-
-@query(
-    "q371_stack_distance",
-    """WITH acc AS (SELECT event_id AS pos,
-                CASE WHEN event_id % 4 = 0 THEN 0
-                     WHEN event_id % 4 = 1 THEN 20 + (event_id // 4) % 3
-                     WHEN event_id % 4 = 2 THEN 50 + (event_id // 4) % 12
-                     ELSE 100 + (event_id * 7919) % 97 END AS item
-              FROM events),
-       prevs AS (SELECT pos, item,
-                        lag(pos) OVER (PARTITION BY item ORDER BY pos) AS pp
-                 FROM acc),
-       warm AS (SELECT a.pos, count(DISTINCT b.item) AS d
-                FROM prevs a LEFT JOIN acc b
-                  ON b.pos > a.pp AND b.pos < a.pos
-                WHERE a.pp IS NOT NULL GROUP BY a.pos),
-       dist AS (SELECT d FROM warm
-                UNION ALL
-                SELECT -1 AS d FROM prevs WHERE pp IS NULL),
-       lab AS (SELECT CASE WHEN d < 0 THEN 'cold' WHEN d < 4 THEN 'lt4'
-                           WHEN d < 16 THEN 'lt16' WHEN d < 64 THEN 'lt64'
-                           ELSE 'ge64' END AS bucket, d FROM dist)
-       SELECT bucket, CAST(count(*) AS BIGINT) AS n_accesses,
-              CAST(min(d) AS BIGINT) AS min_d,
-              CAST(max(d) AS BIGINT) AS max_d
-       FROM lab GROUP BY bucket""",
-)
-def q371(spark, sf_dir):
-    """LRU stack-distance (reuse-distance) histogram — Mattson's
-    one-pass answer to "what would the hit ratio be at EVERY cache
-    size": an access hits a size-C LRU cache iff the number of
-    DISTINCT items touched since its previous access is < C, so the
-    bucketed distance histogram (lt4/lt16/lt64/ge64 + cold) reads
-    off the whole hit-ratio curve at once — the cache-capacity
-    planning input q330's static admission plan cannot give.
-    Access stream = events in event_id order over a four-class item
-    mix (one hot item, period-3 and period-12 working sets, a
-    97-item cold tail — exact integer derivation) so every cache
-    tier of the curve is populated at every SF.  Shape: the
-    previous-access position is a per-item lag window (item-sharded,
-    scales); the distinct-count-in-reuse-interval join is BUCKETED —
-    each warm access explodes to the 32-position blocks its interval
-    spans and equi-joins on the block id (a pure range join has no
-    equi key and Spark plans a BroadcastNestedLoopJoin: O(n^2), 52 s
-    at sf0.1 where this plan takes ~2 s), so candidate volume is
-    Σ reuse-gap lengths + 2·32 per access — bounded for the
-    cacheable (small-gap) mass that decides the curve.  The classic
-    one-pass Mattson stack walk is inherently sequential and belongs
-    to the per-shard streaming tier; this is its exact batch form."""
-    e = _t(spark, sf_dir, "events").select(
-        F.col("event_id").alias("pos"),
-        F.when(F.col("event_id") % 4 == 0, F.lit(0))
-        .when(F.col("event_id") % 4 == 1,
-              20 + F.expr("event_id div 4") % 3)
-        .when(F.col("event_id") % 4 == 2,
-              50 + F.expr("event_id div 4") % 12)
-        .otherwise(100 + (F.col("event_id") * 7919) % 97)
-        .alias("item"),
-    )
-    w = Window.partitionBy("item").orderBy("pos")
-    a = e.withColumn("pp", F.lag("pos").over(w))
-    wa = a.filter(F.col("pp").isNotNull()).select("pos", "pp")
-    # block-bucketed range join: explode each reuse interval to the
-    # 32-position blocks it spans, equi-join on the block id, filter
-    # exactly — a hash join Catalyst can shuffle, never a BNLJ.
-    blk_a = wa.withColumn(
-        "blk", F.explode(F.sequence(F.expr("(pp + 1) div 32"),
-                                    F.expr("(pos - 1) div 32"))))
-    b = e.select(F.col("pos").alias("bpos"), F.col("item").alias("bitem"),
-                 F.expr("pos div 32").alias("blk"))
-    counts = (
-        blk_a.join(b, "blk")
-        .filter((F.col("bpos") > F.col("pp")) & (F.col("bpos") < F.col("pos")))
-        .groupBy("pos")
-        .agg(F.countDistinct("bitem").alias("dc"))
-    )
-    warm = (
-        wa.join(counts, "pos", "left")
-        .select(F.coalesce(F.col("dc"), F.lit(0)).alias("d"))
-    )
-    cold = a.filter(F.col("pp").isNull()).select(F.lit(-1).alias("d"))
-    dist = warm.unionByName(cold)
-    lab = dist.select(
-        F.when(F.col("d") < 0, "cold")
-        .when(F.col("d") < 4, "lt4")
-        .when(F.col("d") < 16, "lt16")
-        .when(F.col("d") < 64, "lt64")
-        .otherwise("ge64")
-        .alias("bucket"),
-        "d",
-    )
-    return lab.groupBy("bucket").agg(
-        F.count("*").cast("long").alias("n_accesses"),
-        F.min("d").cast("long").alias("min_d"),
-        F.max("d").cast("long").alias("max_d"),
-    )
-
-
-# --- ranking eval: exact-integer MRR@10 (q372) ---------------------------------
-
-
-@query(
-    "q372_ranking_mrr",
-    """WITH tf AS (SELECT doc_id, word, count(*) AS tf FROM
-                     (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-                      FROM documents)
-                   GROUP BY doc_id, word),
-       d AS (SELECT word, count(*) AS df FROM tf GROUP BY word),
-       top AS (SELECT a.word
-               FROM d a LEFT JOIN d b
-                 ON b.df > a.df OR (b.df = a.df AND b.word < a.word)
-               GROUP BY a.word, a.df
-               HAVING count(b.word) < 20),
-       cls AS (SELECT tf.* FROM tf JOIN top USING (word)
-               WHERE doc_id % 7 = length(word) % 7),
-       m1 AS (SELECT word, max(tf) AS rel_tf FROM cls GROUP BY word),
-       rel AS (SELECT cls.word, m1.rel_tf, min(cls.doc_id) AS rel_doc
-               FROM cls JOIN m1
-                 ON m1.word = cls.word AND cls.tf = m1.rel_tf
-               GROUP BY cls.word, m1.rel_tf),
-       rk AS (SELECT rel.word, count(c.doc_id) + 1 AS rnk
-              FROM rel LEFT JOIN tf c
-                ON c.word = rel.word
-               AND (c.tf > rel.rel_tf
-                    OR (c.tf = rel.rel_tf AND c.doc_id < rel.rel_doc))
-              GROUP BY rel.word)
-       SELECT CAST(count(*) AS BIGINT) AS n_queries,
-              CAST(sum(CASE WHEN rnk = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                AS hits_at1,
-              CAST(sum(CASE WHEN rnk <= 5 THEN 1 ELSE 0 END) AS BIGINT)
-                AS hits_at5,
-              CAST(sum(CASE WHEN rnk <= 10 THEN 1 ELSE 0 END) AS BIGINT)
-                AS hits_at10,
-              CAST(sum(CASE WHEN rnk <= 10 THEN 2520 // rnk ELSE 0 END)
-                AS BIGINT) AS mrr_x2520,
-              CAST(sum(CASE WHEN rnk <= 10 THEN 2520 // rnk ELSE 0 END)
-                AS DOUBLE) / (2520.0 * count(*)) AS mrr
-       FROM rk""",
-)
-def q372(spark, sf_dir):
-    """Search-ranking MRR@10 as EXACT integers — the offline eval
-    number behind every ranker change, computed with no float until
-    the final single division: reciprocal rank 1/r is scaled by
-    2520 = lcm(1..10), so 2520 div r is exact for every admissible
-    rank and the MRR numerator sums in BIGINT; the reported `mrr`
-    is ONE double division at the end (bitwise across engines).
-    Query set = top-20 lexicon terms by (df desc, word asc)
-    count-of-greater ranks (lexicon-bounded, never a window);
-    editorial relevance label = the argmax-tf doc within the term's
-    assessment class (doc_id % 7 == len(word) % 7, min-doc tiebreak)
-    so labels land at varied in-range ranks; the ranker orders docs
-    by (tf desc, doc_id asc), and the relevant doc's rank is
-    1 + count(better docs) — ONE count per query (20·df pairs,
-    linear in corpus), never a materialized full ranking.
-    hits@1/5/10 fall out of the same pass."""
-    docs = _t(spark, sf_dir, "documents")
-    tf = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-        .groupBy("word", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    d = tf.groupBy("word").agg(F.count("*").alias("df"))
-    lex = d.select(F.col("word").alias("w2"), F.col("df").alias("df2"))
-    top = (
-        d.join(
-            F.broadcast(lex),
-            (F.col("df2") > F.col("df"))
-            | ((F.col("df2") == F.col("df")) & (F.col("w2") < F.col("word"))),
-            "left",
-        )
-        .groupBy("word", "df")
-        .agg(F.count("w2").alias("n_greater"))
-        .filter(F.col("n_greater") < 20)
-        .select("word")
-    )
-    cls = tf.join(F.broadcast(top), "word").filter(
-        F.col("doc_id") % 7 == F.length("word") % 7)
-    # editorial label = argmax tf within the class, min doc_id tiebreak —
-    # ONE combinable max(struct(tf, -doc_id)) per word (the q334 idiom);
-    # the oracle mirrors it TWO-PHASE (max tf, then min doc at that tf)
-    # per the round-4f struct-max contract.
-    rel = (
-        cls.groupBy("word")
-        .agg(F.max(F.struct(F.col("tf").alias("t"),
-                            (-F.col("doc_id")).alias("nid"))).alias("s"))
-        .select("word", F.col("s.t").alias("rel_tf"),
-                (-F.col("s.nid")).alias("rel_doc"))
-    )
-    cand = tf.select(F.col("word").alias("cw"), F.col("doc_id").alias("cd"),
-                     F.col("tf").alias("ctf"))
-    rk = (
-        rel.join(
-            cand,
-            (F.col("cw") == F.col("word"))
-            & ((F.col("ctf") > F.col("rel_tf"))
-               | ((F.col("ctf") == F.col("rel_tf"))
-                  & (F.col("cd") < F.col("rel_doc")))),
-            "left",
-        )
-        .groupBy("word")
-        .agg((F.count("cd") + F.lit(1)).alias("rnk"))
-    )
-    agg = rk.agg(
-        F.count("*").cast("long").alias("n_queries"),
-        F.sum(F.when(F.col("rnk") == 1, 1).otherwise(0)).cast("long")
-        .alias("hits_at1"),
-        F.sum(F.when(F.col("rnk") <= 5, 1).otherwise(0)).cast("long")
-        .alias("hits_at5"),
-        F.sum(F.when(F.col("rnk") <= 10, 1).otherwise(0)).cast("long")
-        .alias("hits_at10"),
-        F.sum(F.when(F.col("rnk") <= 10, F.expr("2520 div rnk")).otherwise(0))
-        .cast("long").alias("mrr_x2520"),
-    )
-    return agg.select(
-        "n_queries", "hits_at1", "hits_at5", "hits_at10", "mrr_x2520",
-        (F.col("mrr_x2520").cast("double")
-         / (F.lit(2520.0) * F.col("n_queries"))).alias("mrr"),
-    )
-
-
-# --- position-bias CTR estimation (q373) ----------------------------------------
-
-
-@query(
-    "q373_position_bias_ctr",
-    """WITH imp AS (SELECT event_id,
-                event_id % 10 + 1 AS serp_pos,
-                (event_id // 10 + (event_id % 10 + 1) * 13) % 50 AS item
-              FROM events),
-       lab AS (SELECT serp_pos,
-                      CASE WHEN (item * 7919) % 100 >= 40
-                            AND (event_id * 2654435761) % 97
-                                < 97 - 9 * (serp_pos - 1)
-                           THEN 1 ELSE 0 END AS clicked
-               FROM imp),
-       st AS (SELECT serp_pos,
-                     CAST(count(*) AS BIGINT) AS n_impr,
-                     CAST(sum(clicked) AS BIGINT) AS n_clicks
-              FROM lab GROUP BY serp_pos),
-       p1 AS (SELECT n_impr AS i1, n_clicks AS c1 FROM st WHERE serp_pos = 1)
-       SELECT serp_pos, n_impr, n_clicks,
-              CAST(n_clicks AS DOUBLE) / CAST(n_impr AS DOUBLE) AS ctr,
-              CAST(n_clicks * i1 AS DOUBLE)
-                / CAST(n_impr * c1 AS DOUBLE) AS bias_vs_pos1
-       FROM st, p1""",
-)
-def q373(spark, sf_dir):
-    """Position-bias curve from click logs — the propensity estimate
-    every counterfactual learning-to-rank pipeline divides by
-    (clicks at rank k are depressed by EXAMINATION, not relevance;
-    training on raw clicks bakes the presentation order in).  The
-    impression log is a Latin-square rotation (item = (query +
-    13*pos) % 50) so every item visits every SERP position —
-    result-randomization identification, no relevance confound;
-    the click model is deterministic-integer (item-intrinsic
-    relevance gate x position-decaying examination slot) so both
-    engines reproduce it exactly.  bias@k = ctr@k / ctr@1 is
-    emitted as ONE double division of exact BIGINT cross-products
-    (clicks_k*impr_1) / (impr_k*clicks_1) — bitwise across engines,
-    and pos 1 is exactly 1.0.  Shape: one groupBy over 10 positions
-    (map-side combinable), the rank-1 row broadcast-crossed back —
-    no window, no skew; scales as one pass over the log."""
-    e = _t(spark, sf_dir, "events").select("event_id")
-    imp = e.select(
-        (F.col("event_id") % 10 + 1).alias("serp_pos"),
-        ((F.expr("event_id div 10") + (F.col("event_id") % 10 + 1) * 13) % 50
-         ).alias("item"),
-        "event_id",
-    )
-    lab = imp.select(
-        "serp_pos",
-        F.when(
-            ((F.col("item") * 7919) % 100 >= 40)
-            & ((F.col("event_id") * F.lit(2654435761)) % 97
-               < 97 - 9 * (F.col("serp_pos") - 1)),
-            1,
-        ).otherwise(0).alias("clicked"),
-    )
-    st = lab.groupBy("serp_pos").agg(
-        F.count("*").cast("long").alias("n_impr"),
-        F.sum("clicked").cast("long").alias("n_clicks"),
-    )
-    p1 = st.filter(F.col("serp_pos") == 1).select(
-        F.col("n_impr").alias("i1"), F.col("n_clicks").alias("c1"))
-    return st.crossJoin(F.broadcast(p1)).select(
-        "serp_pos", "n_impr", "n_clicks",
-        (F.col("n_clicks").cast("double") / F.col("n_impr").cast("double")
-         ).alias("ctr"),
-        ((F.col("n_clicks") * F.col("i1")).cast("double")
-         / (F.col("n_impr") * F.col("c1")).cast("double")
-         ).alias("bias_vs_pos1"),
-    )
-
-
-# --- exact latency percentiles via bounded-domain histogram (q374) --------------
-
-
-@query(
-    "q374_latency_percentiles",
-    """WITH req AS (SELECT event_type AS endpoint,
-                (event_id * 48271) % 1000
-                + CASE WHEN event_id % 20 = 0
-                       THEN (event_id * 69621) % 9000 ELSE 0 END AS lat
-              FROM events),
-       hist AS (SELECT endpoint, lat, CAST(count(*) AS BIGINT) AS cnt
-                FROM req GROUP BY endpoint, lat),
-       cum AS (SELECT endpoint, lat, cnt,
-                      CAST(sum(cnt) OVER (PARTITION BY endpoint ORDER BY lat
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS BIGINT) AS c,
-                      CAST(sum(cnt) OVER (PARTITION BY endpoint)
-                           AS BIGINT) AS n
-               FROM hist)
-       SELECT endpoint, CAST(max(n) AS BIGINT) AS n_requests,
-              CAST(min(CASE WHEN 1000*c >= 500*n THEN lat END) AS BIGINT) AS p50,
-              CAST(min(CASE WHEN 1000*c >= 900*n THEN lat END) AS BIGINT) AS p90,
-              CAST(min(CASE WHEN 1000*c >= 990*n THEN lat END) AS BIGINT) AS p99,
-              CAST(min(CASE WHEN 1000*c >= 999*n THEN lat END) AS BIGINT)
-                AS p999
-       FROM cum GROUP BY endpoint""",
-)
-def q374(spark, sf_dir):
-    """EXACT p50/p90/p99/p999 latency per endpoint WITHOUT sorting
-    the stream — the SLO numbers, and the reason they are usually
-    approximated (percentile_approx / t-digest): a naive exact
-    percentile sorts the corpus.  When the value domain is bounded
-    (integer milliseconds, here 0..9999 with a 5% heavy tail), the
-    exact answer is a HISTOGRAM problem: groupBy (endpoint, lat)
-    counts — map-side combinable, output bounded by |endpoints| x
-    |domain|, NOT corpus size — then a cumulative window over the
-    bounded histogram and nearest-rank selection min(lat : cum >=
-    ceil(q*n)) written as the integer cross-multiplication
-    1000*cum >= k*n (no ceil, no float, per house style).  All
-    output columns are BIGINT — nothing to round, bitwise by
-    construction.  The window partition is <= 10^4 rows per
-    endpoint at ANY corpus size: this is the exact-percentile plan
-    that still works at 100 TB, vs the q294 log-binned approximate
-    quantiles when the domain is unbounded."""
-    e = _t(spark, sf_dir, "events").select("event_id", "event_type")
-    req = e.select(
-        F.col("event_type").alias("endpoint"),
-        ((F.col("event_id") * 48271) % 1000
-         + F.when(F.col("event_id") % 20 == 0,
-                  (F.col("event_id") * 69621) % 9000).otherwise(0)
-         ).alias("lat"),
-    )
-    hist = req.groupBy("endpoint", "lat").agg(
-        F.count("*").cast("long").alias("cnt"))
-    wcum = (Window.partitionBy("endpoint").orderBy("lat")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    wall = Window.partitionBy("endpoint")
-    cum = hist.select(
-        "endpoint", "lat",
-        F.sum("cnt").over(wcum).alias("c"),
-        F.sum("cnt").over(wall).alias("n"),
-    )
-    def pick(k, name):
-        return F.min(
-            F.when(1000 * F.col("c") >= k * F.col("n"), F.col("lat"))
-        ).cast("long").alias(name)
-    return cum.groupBy("endpoint").agg(
-        F.max("n").cast("long").alias("n_requests"),
-        pick(500, "p50"), pick(900, "p90"), pick(990, "p99"),
-        pick(999, "p999"),
-    )
-
-
-# --- snapshot GC / retention planning (q375) -------------------------------------
-
-
-@query(
-    "q375_snapshot_gc",
-    """WITH files AS (SELECT event_id AS file_id,
-                event_id % 16 AS part,
-                1000 + (event_id * 127) % 9000 AS bytes,
-                (event_id * 31) % 20 AS created,
-                CASE WHEN event_id % 3 = 0 THEN NULL
-                     ELSE (event_id * 31) % 20 + 1 + (event_id * 7) % 6
-                     END AS deleted_at
-              FROM events),
-       cls AS (SELECT part, bytes,
-                      CASE WHEN deleted_at IS NULL OR deleted_at > 19
-                           THEN 1 ELSE 0 END AS live_head,
-                      CASE WHEN deleted_at IS NOT NULL
-                            AND deleted_at <= 19 AND deleted_at > 17
-                           THEN 1 ELSE 0 END AS pinned,
-                      CASE WHEN deleted_at IS NOT NULL AND deleted_at <= 17
-                           THEN 1 ELSE 0 END AS reclaim
-               FROM files)
-       SELECT part, CAST(count(*) AS BIGINT) AS n_files,
-              CAST(sum(live_head) AS BIGINT) AS live_head,
-              CAST(sum(pinned) AS BIGINT) AS pinned_by_retention,
-              CAST(sum(reclaim) AS BIGINT) AS reclaim_files,
-              CAST(sum(reclaim * bytes) AS BIGINT) AS reclaim_bytes
-       FROM cls GROUP BY part""",
-)
-def q375(spark, sf_dir):
-    """Snapshot garbage collection with a time-travel retention
-    window — the expire-snapshots planning query under every
-    table-format maintenance job (Iceberg expireSnapshots /
-    RemoveOrphanFiles; this repo's own plans/manifest.py snapshots
-    create exactly this file lifecycle).  Synthetic file ledger:
-    created/deleted snapshot ids derived from event keys; head = 19,
-    retained = {17,18,19}.  A file is reclaimable iff no retained
-    snapshot can see it (deleted_at <= min(retained)); files deleted
-    before head but after min(retained) are PINNED — the bytes you
-    would free by tightening retention, the number the storage-cost
-    conversation actually needs, split out per partition next to the
-    reclaimable bytes.  Pure per-row integer classification + one
-    partition-keyed groupBy (map-side combinable) — one pass over
-    the manifest at any scale, no join at all."""
-    e = _t(spark, sf_dir, "events").select("event_id")
-    files = e.select(
-        (F.col("event_id") % 16).alias("part"),
-        (1000 + (F.col("event_id") * 127) % 9000).alias("bytes"),
-        F.when(F.col("event_id") % 3 == 0, F.lit(None).cast("long"))
-        .otherwise((F.col("event_id") * 31) % 20 + 1 + (F.col("event_id") * 7) % 6)
-        .alias("deleted_at"),
-    )
-    cls = files.select(
-        "part", "bytes",
-        F.when(F.col("deleted_at").isNull() | (F.col("deleted_at") > 19), 1)
-        .otherwise(0).alias("live_head"),
-        F.when(F.col("deleted_at").isNotNull()
-               & (F.col("deleted_at") <= 19) & (F.col("deleted_at") > 17), 1)
-        .otherwise(0).alias("pinned"),
-        F.when(F.col("deleted_at").isNotNull() & (F.col("deleted_at") <= 17), 1)
-        .otherwise(0).alias("reclaim"),
-    )
-    return cls.groupBy("part").agg(
-        F.count("*").cast("long").alias("n_files"),
-        F.sum("live_head").cast("long").alias("live_head"),
-        F.sum("pinned").cast("long").alias("pinned_by_retention"),
-        F.sum(F.col("reclaim") * F.col("bytes")).cast("long").alias("rb"),
-        F.sum("reclaim").cast("long").alias("reclaim_files"),
-    ).select("part", "n_files", "live_head", "pinned_by_retention",
-             "reclaim_files", F.col("rb").alias("reclaim_bytes"))
-
-
-# --- adaptive quadtree leaf assignment (q376) ------------------------------------
-
-
-@query(
-    "q376_quadtree_build",
-    """WITH pts AS (SELECT event_id,
-                CASE WHEN event_id % 10 < 3
-                     THEN 1024 + (event_id * 13) % 64
-                     ELSE (event_id * 48271) % 4096 END AS x,
-                CASE WHEN event_id % 10 < 3
-                     THEN 2048 + (event_id * 17) % 64
-                     ELSE (event_id * 69621) % 4096 END AS y
-              FROM events),
-       lev AS (SELECT event_id, x, y, d,
-                      (x // (1 << (12 - d))) * 64 + (y // (1 << (12 - d)))
-                        AS cell
-               FROM pts CROSS JOIN (SELECT unnest(range(7)) AS d)),
-       cnt AS (SELECT d, cell, count(*) AS c FROM lev GROUP BY d, cell),
-       leafd AS (SELECT event_id, x, y,
-                        coalesce(min(CASE WHEN c <= 64 THEN d END), 6) AS ld
-                 FROM lev JOIN cnt USING (d, cell)
-                 GROUP BY event_id, x, y),
-       occ AS (SELECT ld,
-                      (x // (1 << (12 - ld))) * 64 + (y // (1 << (12 - ld)))
-                        AS cell,
-                      count(*) AS pts
-               FROM leafd GROUP BY 1, 2)
-       SELECT CAST(ld AS BIGINT) AS depth,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(sum(pts) AS BIGINT) AS n_points,
-              CAST(min(pts) AS BIGINT) AS min_cell_pts,
-              CAST(max(pts) AS BIGINT) AS max_cell_pts
-       FROM occ GROUP BY ld""",
-)
-def q376(spark, sf_dir):
-    """Adaptive quadtree index build — leaf assignment per point
-    where a cell splits iff it holds > 64 points, max depth 6 over a
-    4096x4096 grid: the capacity-driven spatial index whose leaf
-    histogram (cells / points / occupancy per depth) is the index
-    manifest a spatial-partitioning sink writes.  Quadtree cells
-    NEST, so two points sharing a depth-d cell share every ancestor
-    — leaf depth is a pure function of the point's 7-cell ancestry
-    and the whole build is THREE bounded aggregations, no recursion:
-    explode each point to its 7 (depth, cell) keys, count per key
-    (output bounded by sum 4^d = 5461 cells, broadcastable — never
-    corpus-sized), take min depth whose count <= capacity (coalesce
-    to the depth cap — the hotspot-overflow leaf), re-derive the
-    leaf cell arithmetically.  A 64x64 hotspot holding 30% of points
-    pins the overflow path; the uniform background populates the
-    shallow depths.  At 100 TB the count table is still 5461 rows —
-    the iterative split-only-overfull loop the single-node reference
-    would run is unnecessary in the declarative form."""
-    e = _t(spark, sf_dir, "events").select("event_id")
-    pts = e.select(
-        "event_id",
-        F.when(F.col("event_id") % 10 < 3,
-               1024 + (F.col("event_id") * 13) % 64)
-        .otherwise((F.col("event_id") * 48271) % 4096).alias("x"),
-        F.when(F.col("event_id") % 10 < 3,
-               2048 + (F.col("event_id") * 17) % 64)
-        .otherwise((F.col("event_id") * 69621) % 4096).alias("y"),
-    )
-    lev = pts.withColumn("d", F.explode(F.sequence(F.lit(0), F.lit(6)))) \
-        .withColumn(
-            "cell",
-            F.expr("(x div shiftleft(1, 12 - d)) * 64"
-                   " + (y div shiftleft(1, 12 - d))"))
-    cnt = lev.groupBy("d", "cell").agg(F.count("*").alias("c"))
-    leafd = (
-        lev.join(F.broadcast(cnt), ["d", "cell"])
-        .groupBy("event_id", "x", "y")
-        .agg(F.coalesce(
-            F.min(F.when(F.col("c") <= 64, F.col("d"))), F.lit(6)).alias("ld"))
-    )
-    occ = leafd.select(
-        "ld",
-        F.expr("(x div shiftleft(1, 12 - ld)) * 64"
-               " + (y div shiftleft(1, 12 - ld))").alias("cell"),
-    ).groupBy("ld", "cell").agg(F.count("*").alias("pts"))
-    return occ.groupBy("ld").agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.sum("pts").cast("long").alias("n_points"),
-        F.min("pts").cast("long").alias("min_cell_pts"),
-        F.max("pts").cast("long").alias("max_cell_pts"),
-    ).select(F.col("ld").cast("long").alias("depth"), "n_cells", "n_points",
-             "min_cell_pts", "max_cell_pts")
-
-
-# --- language-diversity Gini / HHI per source (q377) -----------------------------
-
-
-@query(
-    "q377_language_gini",
-    """WITH lc AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS c
-              FROM documents GROUP BY source, lang),
-       st AS (SELECT source, CAST(count(*) AS BIGINT) AS n_langs,
-                     CAST(sum(c) AS BIGINT) AS n_docs,
-                     CAST(sum(c * c) AS BIGINT) AS sum_c2
-              FROM lc GROUP BY source),
-       pr AS (SELECT a.source, CAST(sum(abs(a.c - b.c)) AS BIGINT) AS num
-              FROM lc a JOIN lc b ON a.source = b.source
-              GROUP BY a.source)
-       SELECT source, n_docs, n_langs,
-              CAST(num AS DOUBLE)
-                / CAST(2 * n_langs * n_docs AS DOUBLE) AS gini,
-              CAST(sum_c2 AS DOUBLE)
-                / CAST(n_docs * n_docs AS DOUBLE) AS hhi
-       FROM st JOIN pr USING (source)""",
-)
-def q377(spark, sf_dir):
-    """Language-diversity concentration per source — the corpus-mix
-    governance numbers next to q348's datasheet: Gini coefficient
-    over each source's language distribution (G = Σij|ci-cj| /
-    (2·k·Σc), the mean-absolute-difference form — 0 = perfectly
-    balanced languages, →1 = one language dominates) and the
-    Herfindahl-Hirschman index (Σci²/total² — the acquisition-review
-    number).  Both emitted as ONE double division of exact BIGINT
-    products.  The pairwise |ci-cj| sum joins the per-(source,lang)
-    count table to itself on source: the LANGUAGE LEXICON bounds the
-    join (k² pairs per source for k languages, k ≤ dozens), never
-    the corpus — the q19-lesson df-cap logic applied to a diversity
-    statistic.  One groupBy over the corpus feeds everything."""
-    docs = _t(spark, sf_dir, "documents")
-    lc = docs.groupBy("source", "lang").agg(
-        F.count("*").cast("long").alias("c"))
-    st = lc.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_langs"),
-        F.sum("c").cast("long").alias("n_docs"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("sum_c2"),
-    )
-    lc2 = lc.select(F.col("source").alias("source"),
-                    F.col("c").alias("c2"))
-    pr = lc.join(lc2, "source").groupBy("source").agg(
-        F.sum(F.abs(F.col("c") - F.col("c2"))).cast("long").alias("num"))
-    return st.join(pr, "source").select(
-        "source", "n_docs", "n_langs",
-        (F.col("num").cast("double")
-         / (2 * F.col("n_langs") * F.col("n_docs")).cast("double")
-         ).alias("gini"),
-        (F.col("sum_c2").cast("double")
-         / (F.col("n_docs") * F.col("n_docs")).cast("double")).alias("hhi"),
-    )
-
-
-# --- T5 span-corruption planning (q378) ------------------------------------------
-
-
-@query(
-    "q378_span_corruption_plan",
-    """WITH d AS (SELECT doc_id,
-                CAST(len(string_split(text, ' ')) AS BIGINT) AS L
-              FROM documents),
-       el AS (SELECT doc_id, L,
-                     CASE WHEN L // 20 >= 64
-                          THEN CAST(error('q378: spans outgrew range(64)')
-                                    AS BIGINT)
-                          ELSE L // 20 END AS s,
-                     CAST(length(bin(L)) AS BIGINT) AS len_bucket
-              FROM d WHERE L >= 20),
-       g AS (SELECT el.len_bucket,
-                    ((j.j * L) // s) - (((j.j - 1) * L) // s) AS gap
-             FROM el JOIN (SELECT unnest(range(64)) AS j) j
-               ON j.j >= 1 AND j.j < s),
-       agg AS (SELECT len_bucket, CAST(count(*) AS BIGINT) AS n_docs,
-                      CAST(sum(L) AS BIGINT) AS raw_tokens,
-                      CAST(sum(3 * s) AS BIGINT) AS corrupted_tokens,
-                      CAST(sum(L - 2 * s) AS BIGINT) AS input_tokens,
-                      CAST(sum(4 * s + 1) AS BIGINT) AS target_tokens
-               FROM el GROUP BY len_bucket),
-       gg AS (SELECT len_bucket, CAST(min(gap) AS BIGINT) AS mg
-              FROM g GROUP BY len_bucket)
-       SELECT agg.len_bucket, n_docs, raw_tokens, corrupted_tokens,
-              input_tokens, target_tokens,
-              coalesce(gg.mg, -1) AS min_start_gap
-       FROM agg LEFT JOIN gg USING (len_bucket)""",
-)
-def q378(spark, sf_dir):
-    """T5-style span-corruption pretraining plan — the sequence-
-    length accounting that sizes the encoder/decoder batches BEFORE
-    tokenizing a single example: corruption rate 15%, mean span 3 =>
-    s = L div 20 spans of 3 tokens; encoder input length L - 2s
-    (each span collapses to one sentinel), decoder target 4s + 1
-    (spans + sentinels + EOS).  Per power-of-two length bucket (the
-    shared bin()-length idiom): docs, raw/corrupted/input/target
-    token totals — the packing planner's (q93/q315) demand curve.
-    Span starts are the deterministic lattice (j·L) div s, and the
-    emitted min_start_gap PROVES non-overlap (gap >= 20 > span
-    length 3 by floor-sequence arithmetic) instead of assuming it —
-    the q368 prove-don't-assume pattern; gaps come from pure
-    arithmetic on the exploded span index, s <= L/20 rows per doc,
-    no join, no window; the oracle's fixed range(64) carries the
-    loud error() guard against fixture outgrowth."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("long").alias("L"))
-    el = d.filter(F.col("L") >= 20).select(
-        "doc_id", "L",
-        F.expr("L div 20").alias("s"),
-        F.expr("CAST(length(bin(L)) AS BIGINT)").alias("len_bucket"),
-    )
-    g = (
-        el.filter(F.col("s") >= 2)
-        .withColumn("j", F.explode(F.sequence(F.lit(1), F.col("s") - 1)))
-        .select("len_bucket",
-                F.expr("(j * L) div s - ((j - 1) * L) div s").alias("gap"))
-    )
-    gg = g.groupBy("len_bucket").agg(
-        F.min("gap").cast("long").alias("mg"))
-    agg = el.groupBy("len_bucket").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("L").cast("long").alias("raw_tokens"),
-        F.sum(3 * F.col("s")).cast("long").alias("corrupted_tokens"),
-        F.sum(F.col("L") - 2 * F.col("s")).cast("long").alias("input_tokens"),
-        F.sum(4 * F.col("s") + 1).cast("long").alias("target_tokens"),
-    )
-    return agg.join(gg, "len_bucket", "left").select(
-        "len_bucket", "n_docs", "raw_tokens", "corrupted_tokens",
-        "input_tokens", "target_tokens",
-        F.coalesce(F.col("mg"), F.lit(-1)).alias("min_start_gap"),
-    )
-
-
-# --- exact AUC via bounded score histogram (q379) --------------------------------
-
-
-@query(
-    "q379_exact_auc",
-    """WITH scored AS (SELECT
-                (n_chars * 7 + doc_id * 13) % 1000 AS score,
-                CASE WHEN (doc_id * 2654435761) % 1000
-                          < 300 + ((n_chars * 7 + doc_id * 13) % 1000) // 2
-                     THEN 1 ELSE 0 END AS label
-              FROM documents),
-       hist AS (SELECT score,
-                       CAST(sum(label) AS BIGINT) AS n_pos,
-                       CAST(sum(1 - label) AS BIGINT) AS n_neg
-                FROM scored GROUP BY score),
-       cum AS (SELECT score, n_pos, n_neg,
-                      CAST(coalesce(sum(n_neg) OVER (ORDER BY score
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING), 0) AS BIGINT) AS neg_below
-               FROM hist)
-       SELECT CAST(sum(n_pos) AS BIGINT) AS n_pos,
-              CAST(sum(n_neg) AS BIGINT) AS n_neg,
-              CAST(sum(n_pos * neg_below) AS BIGINT) AS concordant_pairs,
-              CAST(sum(n_pos * n_neg) AS BIGINT) AS tied_pairs,
-              CAST(2 * sum(n_pos * neg_below) + sum(n_pos * n_neg) AS DOUBLE)
-                / CAST(2 * sum(n_pos) * sum(n_neg) AS DOUBLE) AS auc
-       FROM cum""",
-)
-def q379(spark, sf_dir):
-    """EXACT ROC-AUC without sorting the corpus — the classifier-
-    quality number behind every filtering-model gate (q194/q320),
-    usually approximated by sampling because the naive Mann-Whitney
-    rank-sum sorts all scores.  With a bounded integer score domain
-    (0..999 here) AUC is a HISTOGRAM problem, same insight as q374:
-    AUC = P(score_pos > score_neg) + P(tie)/2 =
-    (2*Σ_s pos_s·negBelow_s + Σ_s pos_s·neg_s) / (2·P·N) — one
-    groupBy over the corpus (map-side combinable), one cumulative
-    window over the <= 1000-row histogram (bounded by the SCORE
-    DOMAIN, never the corpus — the single-partition window is over
-    1000 rows at 100 TB too), every pair count an exact BIGINT and
-    the AUC ONE double division of them.  The label model is
-    deterministic-integer with P(label) increasing in score, so the
-    fixture's AUC is meaningfully above 0.5 and the tie-correction
-    term is exercised at every score."""
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        ((F.col("n_chars") * 7 + F.col("doc_id") * 13) % 1000).alias("score"),
-        F.when(
-            (F.col("doc_id") * F.lit(2654435761)) % 1000
-            < 300 + F.expr("((n_chars * 7 + doc_id * 13) % 1000) div 2"),
-            1,
-        ).otherwise(0).alias("label"),
-    )
-    hist = scored.groupBy("score").agg(
-        F.sum("label").cast("long").alias("n_pos"),
-        F.sum(1 - F.col("label")).cast("long").alias("n_neg"),
-    )
-    wb = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.select(
-        "n_pos", "n_neg",
-        F.coalesce(F.sum("n_neg").over(wb), F.lit(0)).alias("neg_below"),
-    )
-    return cum.agg(
-        F.sum("n_pos").cast("long").alias("n_pos"),
-        F.sum("n_neg").cast("long").alias("n_neg"),
-        F.sum(F.col("n_pos") * F.col("neg_below")).cast("long")
-        .alias("concordant_pairs"),
-        F.sum(F.col("n_pos") * F.col("n_neg")).cast("long")
-        .alias("tied_pairs"),
-        ((2 * F.sum(F.col("n_pos") * F.col("neg_below"))
-          + F.sum(F.col("n_pos") * F.col("n_neg"))).cast("double")
-         / (2 * F.sum("n_pos") * F.sum("n_neg")).cast("double")).alias("auc"),
-    )
-
-
-# --- shuffle-sharding blast-radius audit (q380) -----------------------------------
-
-
-@query(
-    "q380_shuffle_sharding",
-    """WITH sh AS (SELECT unnest(range(16)) AS s),
-       pairs AS (SELECT a.s AS i, b.s AS j FROM sh a JOIN sh b ON a.s < b.s),
-       ord AS (SELECT a.i, a.j, CAST(count(b.i) AS BIGINT) AS ordn
-               FROM pairs a LEFT JOIN pairs b
-                 ON b.i < a.i OR (b.i = a.i AND b.j < a.j)
-               GROUP BY a.i, a.j),
-       cust AS (SELECT DISTINCT user_id FROM events),
-       asg AS (SELECT user_id,
-                      ((user_id * 2654435761) % 1000003) % 120 AS ordn
-               FROM cust),
-       cc AS (SELECT o.i, o.j, o.ordn, CAST(count(*) AS BIGINT) AS c
-              FROM asg JOIN ord o USING (ordn) GROUP BY o.i, o.j, o.ordn),
-       tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-                      CAST(count(*) AS BIGINT) AS n_asg,
-                      CAST(sum(c * (c - 1) // 2) AS BIGINT) AS full_blast,
-                      CAST(max(c) AS BIGINT) AS max_load,
-                      CAST(min(c) AS BIGINT) AS min_load
-               FROM cc),
-       part AS (SELECT CAST(coalesce(sum(a.c * b.c), 0) AS BIGINT) AS partial
-                FROM cc a JOIN cc b
-                  ON a.ordn < b.ordn
-                 AND (a.i = b.i OR a.i = b.j OR a.j = b.i OR a.j = b.j))
-       SELECT n AS n_customers, n_asg AS n_assignments,
-              full_blast AS full_blast_pairs,
-              partial AS partial_blast_pairs,
-              n * (n - 1) // 2 - full_blast - partial AS isolated_pairs,
-              n * (n - 1) // 2 AS total_pairs,
-              max_load, min_load
-       FROM tot, part""",
-)
-def q380(spark, sf_dir):
-    """Shuffle-sharding blast-radius audit — the isolation proof
-    behind cellular architectures (each customer gets 2 of 16
-    shards; a poisoned customer can only take down customers
-    sharing BOTH shards): classify every customer pair as
-    full-blast (same 2-shard assignment: C(c,2) within each
-    assignment), partial (assignments sharing exactly one shard —
-    two distinct 2-subsets share at most one element, so >=1 IS
-    exactly 1), or isolated, and PROVE the classification partitions
-    all C(N,2) pairs by emitting total_pairs alongside.  The
-    combinatorics never touch customer pairs: the C(16,2) = 120
-    assignment table is built relationally (triangular count-of-
-    smaller ordinal — deterministic in both engines), customers
-    hash-join to it (broadcast, one corpus pass), and the pair
-    classes are exact integer arithmetic over the 120-row
-    aggregate's self-join (120^2 bounded).  c*(c-1) is always even
-    so the // 2 is exact."""
-    e = _t(spark, sf_dir, "events")
-    sh = spark.range(16).select(F.col("id").alias("s"))
-    pairs = sh.crossJoin(sh.select(F.col("s").alias("s2"))) \
-        .filter(F.col("s") < F.col("s2")) \
-        .select(F.col("s").alias("i"), F.col("s2").alias("j"))
-    p2 = pairs.select(F.col("i").alias("i2"), F.col("j").alias("j2"))
-    ordt = (
-        pairs.join(
-            p2,
-            (F.col("i2") < F.col("i"))
-            | ((F.col("i2") == F.col("i")) & (F.col("j2") < F.col("j"))),
-            "left",
-        )
-        .groupBy("i", "j")
-        .agg(F.count("i2").cast("long").alias("ordn"))
-    )
-    # mix through a prime modulus first: 2654435761 = 1 (mod 120), so a
-    # direct % 120 of dense user ids yields CONSECUTIVE ordinals — all
-    # lexicographic pairs (0, j), every assignment sharing shard 0.
-    asg = e.select("user_id").distinct().select(
-        (((F.col("user_id") * F.lit(2654435761)) % 1000003) % 120)
-        .alias("ordn"))
-    cc = asg.join(F.broadcast(ordt), "ordn").groupBy("i", "j", "ordn").agg(
-        F.count("*").cast("long").alias("c"))
-    tot = cc.agg(
-        F.sum("c").cast("long").alias("n"),
-        F.count("*").cast("long").alias("n_asg"),
-        F.sum(F.expr("c * (c - 1) div 2")).cast("long").alias("full_blast"),
-        F.max("c").cast("long").alias("max_load"),
-        F.min("c").cast("long").alias("min_load"),
-    )
-    cc2 = cc.select(F.col("ordn").alias("ordn2"), F.col("i").alias("i2"),
-                    F.col("j").alias("j2"), F.col("c").alias("c2"))
-    part = (
-        cc.join(
-            cc2,
-            (F.col("ordn") < F.col("ordn2"))
-            & ((F.col("i") == F.col("i2")) | (F.col("i") == F.col("j2"))
-               | (F.col("j") == F.col("i2")) | (F.col("j") == F.col("j2"))),
-        )
-        .agg(F.coalesce(F.sum(F.col("c") * F.col("c2")), F.lit(0))
-             .cast("long").alias("partial"))
-    )
-    return tot.crossJoin(part).select(
-        F.col("n").alias("n_customers"),
-        F.col("n_asg").alias("n_assignments"),
-        F.col("full_blast").alias("full_blast_pairs"),
-        F.col("partial").alias("partial_blast_pairs"),
-        (F.expr("n * (n - 1) div 2") - F.col("full_blast") - F.col("partial")
-         ).alias("isolated_pairs"),
-        F.expr("n * (n - 1) div 2").alias("total_pairs"),
-        "max_load", "min_load",
-    )
-
-
-# --- exact expected calibration error (q381) --------------------------------------
-
-
-@query(
-    "q381_calibration_ece",
-    """WITH scored AS (SELECT
-                (doc_id * 48271 + n_chars * 31) % 1000 AS conf,
-                CASE WHEN (doc_id * 2654435761) % 1000
-                          < ((doc_id * 48271 + n_chars * 31) % 1000) * 8 // 10
-                            + 100
-                     THEN 1 ELSE 0 END AS outcome
-              FROM documents),
-       b AS (SELECT conf // 100 AS bucket,
-                    CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum(outcome) AS BIGINT) AS correct,
-                    CAST(sum(conf) AS BIGINT) AS conf_sum
-             FROM scored GROUP BY conf // 100),
-       g AS (SELECT bucket, n, correct, conf_sum,
-                    abs(1000 * correct - conf_sum) AS gap_num
-             FROM b),
-       tot AS (SELECT CAST(sum(gap_num) AS BIGINT) AS gap_total,
-                      CAST(sum(n) AS BIGINT) AS n_total
-               FROM g)
-       SELECT CAST(bucket AS BIGINT) AS bucket, n, correct, conf_sum,
-              CAST(correct AS DOUBLE) / CAST(n AS DOUBLE) AS accuracy,
-              CAST(conf_sum AS DOUBLE) / CAST(1000 * n AS DOUBLE)
-                AS mean_conf,
-              CAST(gap_num AS BIGINT) AS gap_num,
-              CAST(gap_total AS DOUBLE) / CAST(1000 * n_total AS DOUBLE)
-                AS ece
-       FROM g, tot""",
-)
-def q381(spark, sf_dir):
-    """Expected calibration error computed EXACTLY — the reliability
-    number behind every confidence-thresholded filter (q194's gate
-    trusts the classifier's probabilities; ECE says whether it
-    should): with per-mille integer confidences, the per-bucket
-    |accuracy - mean confidence| gap is |1000·correct - Σconf| /
-    (1000·n) — an exact BIGINT numerator — and ECE = Σ_b gap_num /
-    (1000·N) needs ONE double division total; accuracy and mean_conf
-    are each one division too, so every emitted float is a single
-    IEEE op on exact integers.  The outcome model draws with true
-    probability 0.8·conf + 100 per-mille: overconfident above
-    conf = 500, underconfident below — both failure directions
-    exercised, and the |.| is load-bearing.  Shape: one map-side-
-    combinable groupBy into 10 buckets, the scalar totals cross-
-    joined back (1 row) — one corpus pass, bounded everything."""
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        ((F.col("doc_id") * 48271 + F.col("n_chars") * 31) % 1000)
-        .alias("conf"),
-        F.when(
-            (F.col("doc_id") * F.lit(2654435761)) % 1000
-            < F.expr("((doc_id * 48271 + n_chars * 31) % 1000) * 8 div 10")
-            + 100,
-            1,
-        ).otherwise(0).alias("outcome"),
-    )
-    b = scored.groupBy(F.expr("conf div 100").alias("bucket")).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("outcome").cast("long").alias("correct"),
-        F.sum("conf").cast("long").alias("conf_sum"),
-    )
-    g = b.withColumn(
-        "gap_num", F.abs(1000 * F.col("correct") - F.col("conf_sum")))
-    tot = g.agg(F.sum("gap_num").cast("long").alias("gap_total"),
-                F.sum("n").cast("long").alias("n_total"))
-    return g.crossJoin(F.broadcast(tot)).select(
-        F.col("bucket").cast("long").alias("bucket"), "n", "correct",
-        "conf_sum",
-        (F.col("correct").cast("double") / F.col("n").cast("double"))
-        .alias("accuracy"),
-        (F.col("conf_sum").cast("double")
-         / (1000 * F.col("n")).cast("double")).alias("mean_conf"),
-        F.col("gap_num").cast("long").alias("gap_num"),
-        (F.col("gap_total").cast("double")
-         / (1000 * F.col("n_total")).cast("double")).alias("ece"),
-    )
-
-
-# --- interval-union coverage per user (q382) ---------------------------------------
-
-
-@query(
-    "q382_interval_coverage",
-    """WITH iv AS (SELECT user_id, event_id,
-                CAST(floor(epoch(ts)) AS BIGINT) AS s,
-                CAST(floor(epoch(ts)) AS BIGINT)
-                  + 60 + (event_id % 10) * 90 AS e
-              FROM events),
-       mk AS (SELECT user_id, event_id, s, e,
-                     CASE WHEN s > coalesce(max(e) OVER (
-                              PARTITION BY user_id ORDER BY s, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING), -1)
-                          THEN 1 ELSE 0 END AS new_island
-              FROM iv),
-       isl AS (SELECT user_id, s, e,
-                      CAST(sum(new_island) OVER (
-                           PARTITION BY user_id ORDER BY s, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS BIGINT) AS island
-               FROM mk),
-       per AS (SELECT user_id, island,
-                      CAST(max(e) - min(s) AS BIGINT) AS covered
-               FROM isl GROUP BY user_id, island)
-       SELECT user_id,
-              CAST(count(*) AS BIGINT) AS n_islands,
-              CAST(sum(covered) AS BIGINT) AS covered_seconds,
-              CAST(max(covered) AS BIGINT) AS longest_island
-       FROM per GROUP BY user_id""",
-)
-def q382(spark, sf_dir):
-    """Interval-union coverage per user — the gaps-and-islands sweep
-    (total ONLINE time from overlapping session intervals; double-
-    counting overlaps is THE classic uptime-accounting bug): each
-    event opens an interval [epoch, epoch + 60 + (event_id%10)*90s],
-    an interval starts a NEW island iff its start exceeds the
-    running max of all previous ends (one cumulative-max window),
-    islands are numbered by the running sum of the flags (one
-    cumulative-sum window over the same order), and each island
-    contributes max(end) - min(start) exactly once.  Epoch seconds
-    via the q317 cross-engine contract (CAST(floor(epoch)) mirrors
-    unix_timestamp) — all-integer output, nothing to round.  Both
-    windows shard by user_id (the house shuffle-key family): the
-    sweep is linear per user and the merge is one pass — the
-    declarative form of the sort-and-sweep every interval-union
-    implementation runs."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id",
-        F.unix_timestamp("ts").alias("s"),
-        (F.unix_timestamp("ts") + 60 + (F.col("event_id") % 10) * 90)
-        .alias("e"),
-    )
-    wprev = (Window.partitionBy("user_id").orderBy("s", "event_id")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    mk = e.select(
-        "user_id", "event_id", "s", "e",
-        F.when(F.col("s") > F.coalesce(F.max("e").over(wprev), F.lit(-1)), 1)
-        .otherwise(0).alias("new_island"),
-    )
-    wcum = (Window.partitionBy("user_id").orderBy("s", "event_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    isl = mk.select(
-        "user_id", "s", "e",
-        F.sum("new_island").over(wcum).cast("long").alias("island"))
-    per = isl.groupBy("user_id", "island").agg(
-        (F.max("e") - F.min("s")).cast("long").alias("covered"))
-    return per.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_islands"),
-        F.sum("covered").cast("long").alias("covered_seconds"),
-        F.max("covered").cast("long").alias("longest_island"),
-    )
-
-
-# --- species-richness estimators (q383) ---------------------------------------------
-
-
-@query(
-    "q383_chao1_richness",
-    """WITH obs AS (SELECT CASE WHEN doc_id % 16 < 10
-                                THEN doc_id * 4 + 1
-                                WHEN doc_id % 16 < 14
-                                THEN (doc_id // 16) * 4 + 2
-                                ELSE (doc_id // 16) * 4 + 3
-                           END AS species
-              FROM documents),
-       fof AS (SELECT species, CAST(count(*) AS BIGINT) AS f
-               FROM obs GROUP BY species),
-       s AS (SELECT CAST(sum(f) AS BIGINT) AS n_obs,
-                    CAST(count(*) AS BIGINT) AS n_species,
-                    CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS f1,
-                    CAST(sum(CASE WHEN f = 2 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS f2
-             FROM fof)
-       SELECT n_obs, n_species, f1, f2,
-              CAST(n_species * 2 * (f2 + 1) + f1 * (f1 - 1) AS DOUBLE)
-                / CAST(2 * (f2 + 1) AS DOUBLE) AS chao1,
-              CAST(f1 AS DOUBLE) / CAST(n_obs AS DOUBLE) AS missing_mass,
-              CAST(n_obs - f1 AS DOUBLE) / CAST(n_obs AS DOUBLE)
-                AS gt_coverage
-       FROM s""",
-)
-def q383(spark, sf_dir):
-    """Chao1 species-richness + Good-Turing missing mass — the
-    how-much-vocabulary-have-we-NOT-seen estimators that decide
-    whether crawling more of a source still yields new entities
-    (Chao1's unseen-species term f1^2/(2 f2) and Turing's unseen
-    probability mass f1/N both need only the frequency-of-frequencies
-    head, so the whole estimate is two counts over the bounded
-    species table).  Every emitted float is ONE IEEE division of
-    exact BIGINTs: chao1 = (2 V (f2+1) + f1 (f1-1)) / (2 (f2+1))
-    folds the bias-corrected form into a single rational.  The
-    mention model assigns per 16-doc block: 10 singleton species
-    (residue 1 mod 4), one 4-observation species (residue 2), one
-    2-observation species (residue 3) — f1, f2, and a deeper tail all
-    populated at every SF, and the three classes can never collide.
-    Shape: one map-side-combinable groupBy to the species table, one
-    aggregation over it, 1 row out — two passes of pure counting at
-    any corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    obs = docs.select(
-        F.when(F.col("doc_id") % 16 < 10, F.col("doc_id") * 4 + 1)
-        .when(F.col("doc_id") % 16 < 14,
-              F.expr("(doc_id div 16) * 4 + 2"))
-        .otherwise(F.expr("(doc_id div 16) * 4 + 3"))
-        .alias("species")
-    )
-    fof = obs.groupBy("species").agg(F.count("*").cast("long").alias("f"))
-    s = fof.agg(
-        F.sum("f").cast("long").alias("n_obs"),
-        F.count("*").cast("long").alias("n_species"),
-        F.sum(F.when(F.col("f") == 1, 1).otherwise(0)).cast("long")
-        .alias("f1"),
-        F.sum(F.when(F.col("f") == 2, 1).otherwise(0)).cast("long")
-        .alias("f2"),
-    )
-    return s.select(
-        "n_obs", "n_species", "f1", "f2",
-        ((F.col("n_species") * 2 * (F.col("f2") + 1)
-          + F.col("f1") * (F.col("f1") - 1)).cast("double")
-         / (2 * (F.col("f2") + 1)).cast("double")).alias("chao1"),
-        (F.col("f1").cast("double") / F.col("n_obs").cast("double"))
-        .alias("missing_mass"),
-        ((F.col("n_obs") - F.col("f1")).cast("double")
-         / F.col("n_obs").cast("double")).alias("gt_coverage"),
-    )
-
-
-# --- zone-map data-skipping audit (q384) --------------------------------------------
-
-
-@query(
-    "q384_zonemap_skipping",
-    """WITH d AS (SELECT doc_id, doc_id // 100 AS file_id,
-                         doc_id AS ckey,
-                         (doc_id * 2654435761) % 100000 AS ukey
-              FROM documents),
-       tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
-       pr AS (SELECT 'clustered' AS kind, i.i AS probe,
-                     i.i * (tot.n // 10) AS lo,
-                     i.i * (tot.n // 10) + (tot.n // 20) AS hi
-              FROM range(10) i(i), tot
-              UNION ALL
-              SELECT 'unclustered' AS kind, i.i AS probe,
-                     CAST(i.i * 10000 AS BIGINT) AS lo,
-                     CAST(i.i * 10000 + 5000 AS BIGINT) AS hi
-              FROM range(10) i(i)),
-       z AS (SELECT file_id,
-                    min(ckey) AS cmin, max(ckey) AS cmax,
-                    min(ukey) AS umin, max(ukey) AS umax,
-                    CAST(count(*) AS BIGINT) AS n_rows
-             FROM d GROUP BY file_id),
-       nf AS (SELECT CAST(count(*) AS BIGINT) AS n_files FROM z),
-       sc AS (SELECT pr.kind, pr.probe,
-                     CAST(count(*) AS BIGINT) AS files_scanned,
-                     CAST(sum(z.n_rows) AS BIGINT) AS rows_scanned
-              FROM pr JOIN z
-                ON (pr.kind = 'clustered' AND z.cmin < pr.hi
-                    AND z.cmax >= pr.lo)
-                OR (pr.kind = 'unclustered' AND z.umin < pr.hi
-                    AND z.umax >= pr.lo)
-              GROUP BY pr.kind, pr.probe),
-       mt AS (SELECT pr.kind, pr.probe,
-                     CAST(count(DISTINCT d.file_id) AS BIGINT)
-                       AS files_matching,
-                     CAST(count(*) AS BIGINT) AS rows_matched
-              FROM pr JOIN d
-                ON (pr.kind = 'clustered' AND d.ckey >= pr.lo
-                    AND d.ckey < pr.hi)
-                OR (pr.kind = 'unclustered' AND d.ukey >= pr.lo
-                    AND d.ukey < pr.hi)
-              GROUP BY pr.kind, pr.probe)
-       SELECT sc.kind, CAST(sc.probe AS BIGINT) AS probe, nf.n_files,
-              sc.files_scanned, sc.rows_scanned,
-              coalesce(mt.files_matching, 0) AS files_matching,
-              coalesce(mt.rows_matched, 0) AS rows_matched
-       FROM sc LEFT JOIN mt
-         ON sc.kind = mt.kind AND sc.probe = mt.probe
-       CROSS JOIN nf""",
-)
-def q384(spark, sf_dir):
-    """Zone-map data-skipping audit — the min/max-pruning
-    effectiveness report behind every Parquet row-group skip and
-    Iceberg file prune (the repo's own q30 bbox row-group skipping,
-    generalized into a measurable meta-query): per 100-row file,
-    zone = (min,max) of a CLUSTERED key (doc_id — tight zones) and an
-    UNCLUSTERED one (doc_id*2654435761 mod 100000 — every zone spans
-    the domain, stride 35761 is coprime to 100000 so 100 samples
-    equidistribute); ten 5%-of-domain range probes per key kind are
-    checked against the zone table ([lo,hi) overlaps iff min < hi AND
-    max >= lo) and against row-level truth.  Same selectivity, ~20x
-    file-skipping gap — the number that justifies sorting before
-    writing.  Shape: zones = one map-side-combinable groupBy into a
-    FILE-grain table; the 20 probes broadcast against both the zone
-    table and the row stream — bounded output, linear passes, no
-    shuffle beyond the file-grain agg at any corpus size."""
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr("doc_id div 100").alias("file_id"),
-        F.col("doc_id").alias("ckey"),
-        ((F.col("doc_id") * F.lit(2654435761)) % 100000).alias("ukey"),
-    )
-    tot = d.agg(F.count("*").cast("long").alias("n"))
-    idx = spark.createDataFrame([(i,) for i in range(10)], "i INT")
-    prc = F.broadcast(idx).crossJoin(F.broadcast(tot)).select(
-        F.lit("clustered").alias("kind"), F.col("i").alias("probe"),
-        (F.col("i") * F.expr("n div 10")).alias("lo"),
-        (F.col("i") * F.expr("n div 10") + F.expr("n div 20")).alias("hi"),
-    )
-    pru = F.broadcast(idx).select(
-        F.lit("unclustered").alias("kind"), F.col("i").alias("probe"),
-        (F.col("i") * 10000).cast("long").alias("lo"),
-        (F.col("i") * 10000 + 5000).cast("long").alias("hi"),
-    )
-    pr = prc.unionAll(pru)
-    z = d.groupBy("file_id").agg(
-        F.min("ckey").alias("cmin"), F.max("ckey").alias("cmax"),
-        F.min("ukey").alias("umin"), F.max("ukey").alias("umax"),
-        F.count("*").cast("long").alias("n_rows"),
-    )
-    nf = z.agg(F.count("*").cast("long").alias("n_files"))
-    overlap_z = (
-        ((F.col("kind") == "clustered") & (F.col("cmin") < F.col("hi"))
-         & (F.col("cmax") >= F.col("lo")))
-        | ((F.col("kind") == "unclustered") & (F.col("umin") < F.col("hi"))
-           & (F.col("umax") >= F.col("lo")))
-    )
-    sc = (
-        z.join(F.broadcast(pr), overlap_z)
-        .groupBy("kind", "probe")
-        .agg(F.count("*").cast("long").alias("files_scanned"),
-             F.sum("n_rows").cast("long").alias("rows_scanned"))
-    )
-    match_row = (
-        ((F.col("kind") == "clustered") & (F.col("ckey") >= F.col("lo"))
-         & (F.col("ckey") < F.col("hi")))
-        | ((F.col("kind") == "unclustered") & (F.col("ukey") >= F.col("lo"))
-           & (F.col("ukey") < F.col("hi")))
-    )
-    mt = (
-        d.join(F.broadcast(pr), match_row)
-        .groupBy("kind", "probe")
-        .agg(F.countDistinct("file_id").cast("long").alias("files_matching"),
-             F.count("*").cast("long").alias("rows_matched"))
-    )
-    return (
-        sc.join(mt, ["kind", "probe"], "left")
-        .crossJoin(F.broadcast(nf))
-        .select(
-            "kind", F.col("probe").cast("long").alias("probe"), "n_files",
-            "files_scanned", "rows_scanned",
-            F.coalesce("files_matching", F.lit(0)).cast("long")
-            .alias("files_matching"),
-            F.coalesce("rows_matched", F.lit(0)).cast("long")
-            .alias("rows_matched"),
-        )
-    )
-
-
-# --- k-center coreset selection (q385) ----------------------------------------------
-
-_GONZ_L1 = ("CAST(list_sum(list_transform(range(1,65), "
-            "i -> abs({a}.qv[i] - {c}.cqv[i]))) AS BIGINT)")
-
-
-def _gonzalez_oracle_sql() -> str:
-    parts = [
-        """WITH v AS MATERIALIZED (SELECT vec_id,
-                list_transform(embedding,
-                    x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                    AS qv
-             FROM embeddings),
-       c1 AS MATERIALIZED (SELECT vec_id AS cid, qv AS cqv FROM v
-                           ORDER BY vec_id LIMIT 1),
-       d1 AS MATERIALIZED (SELECT v.vec_id, v.qv, """
-        + _GONZ_L1.format(a="v", c="c1")
-        + " AS dmin FROM v, c1)"
-    ]
-    for r in range(2, 6):
-        p = r - 1
-        parts.append(
-            f""",
-       s{r} AS MATERIALIZED (SELECT vec_id AS cid, dmin AS sel_dist
-                             FROM d{p} ORDER BY dmin DESC, vec_id LIMIT 1),
-       c{r} AS MATERIALIZED (SELECT s{r}.cid, s{r}.sel_dist, v.qv AS cqv
-                             FROM v JOIN s{r} ON v.vec_id = s{r}.cid),
-       d{r} AS MATERIALIZED (SELECT d{p}.vec_id, d{p}.qv,
-                     least(d{p}.dmin, """
-            + _GONZ_L1.format(a=f"d{p}", c=f"c{r}")
-            + f") AS dmin FROM d{p}, c{r})"
-        )
-    parts.append(
-        """,
-       rad AS (SELECT CAST(max(dmin) AS BIGINT) AS final_radius FROM d5),
-       u AS (SELECT CAST(1 AS BIGINT) AS rnd, CAST(cid AS BIGINT)
-                      AS center_id, CAST(0 AS BIGINT) AS sel_dist FROM c1"""
-    )
-    for r in range(2, 6):
-        parts.append(
-            f"""
-             UNION ALL SELECT CAST({r} AS BIGINT), CAST(cid AS BIGINT),
-                              CAST(sel_dist AS BIGINT) FROM c{r}"""
-        )
-    parts.append(
-        """)
-       SELECT u.rnd, u.center_id, u.sel_dist, rad.final_radius
-       FROM u, rad"""
-    )
-    return "".join(parts)
-
-
-@query("q385_kcenter_coreset", _gonzalez_oracle_sql())
-def q385(spark, sf_dir):
-    """Gonzalez farthest-point k-center selection (k=5) — the coreset
-    / diverse-prompt-selection primitive (2-approximation to the
-    optimal k-center cover; the geometric complement to q312's
-    relevance-tradeoff MMR): seed = min vec_id, then four unrolled
-    rounds of argmax-of-min-distance with the running dmin column
-    updated by ONE least() against the newly broadcast center — each
-    round is one map-side-combinable max(struct(dmin, -vec_id))
-    (ties to LOWEST id via the negated-id field) plus one 1-row
-    broadcast, so the whole selection is ~2 linear passes per round
-    at any corpus size, never a pairwise matrix.  Distances are
-    exact-integer L1 over the per-mille-quantized embedding (the
-    q332 contract), so both engines agree bitwise; the emitted
-    sel_dist sequence is Gonzalez's non-increasing coverage-radius
-    certificate, and final_radius <= sel_dist of round 5 by
-    construction.  At 100 TB each round would localCheckpoint the
-    dmin column; at fixture scale the lazy chain is 9 passes."""
-    emb = _t(spark, sf_dir, "embeddings")
-    v = emb.selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qv",
-    )
-    l1 = ("CAST(aggregate(zip_with(qv, cqv, (a, b) -> abs(a - b)), "
-          "CAST(0 AS BIGINT), (acc, s) -> acc + s) AS BIGINT)")
-    c1 = (
-        v.orderBy("vec_id").limit(1)
-        .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cqv"))
-    )
-    cur = v.crossJoin(F.broadcast(c1.select("cqv"))).selectExpr(
-        "vec_id", "qv", f"{l1} AS dmin")
-    rows = [
-        c1.select(
-            F.lit(1).cast("long").alias("rnd"),
-            F.col("cid").cast("long").alias("center_id"),
-            F.lit(0).cast("long").alias("sel_dist"),
-        )
-    ]
-    for r in range(2, 6):
-        sel = (
-            cur.agg(
-                F.max(F.struct(F.col("dmin").alias("d"),
-                               (-F.col("vec_id")).alias("nid"))).alias("m")
-            )
-            .select((-F.col("m.nid")).alias("cid"),
-                    F.col("m.d").alias("sel_dist"))
-        )
-        crow = (
-            v.join(F.broadcast(sel), v["vec_id"] == F.col("cid"))
-            .select("cid", "sel_dist", F.col("qv").alias("cqv"))
-        )
-        rows.append(
-            crow.select(
-                F.lit(r).cast("long").alias("rnd"),
-                F.col("cid").cast("long").alias("center_id"),
-                F.col("sel_dist").cast("long").alias("sel_dist"),
-            )
-        )
-        cur = (
-            cur.crossJoin(F.broadcast(crow.select("cqv")))
-            .selectExpr("vec_id", "qv", f"least(dmin, {l1}) AS dmin")
-        )
-    rad = cur.agg(F.max("dmin").cast("long").alias("final_radius"))
-    out = rows[0]
-    for c in rows[1:]:
-        out = out.unionAll(c)
-    return out.crossJoin(F.broadcast(rad))
-
-
-# --- k-anonymity generalization audit (q386) ----------------------------------------
-
-
-@query(
-    "q386_kanonymity_audit",
-    """WITH lv AS (
-         SELECT 0 AS lvl, concat(lang, '|', source, '|',
-                CAST(n_chars // 16 AS VARCHAR)) AS gkey FROM documents
-         UNION ALL
-         SELECT 1, concat(lang, '|', source, '|',
-                CAST(n_chars // 128 AS VARCHAR)) FROM documents
-         UNION ALL
-         SELECT 2, concat(lang, '|', source) FROM documents
-         UNION ALL
-         SELECT 3, lang FROM documents
-         UNION ALL
-         SELECT 4, 'all' FROM documents),
-       g AS (SELECT lvl, gkey, CAST(count(*) AS BIGINT) AS n
-             FROM lv GROUP BY lvl, gkey),
-       per AS (SELECT lvl,
-                      CAST(sum(n) AS BIGINT) AS n_rows,
-                      CAST(count(*) AS BIGINT) AS n_groups,
-                      CAST(min(n) AS BIGINT) AS min_group,
-                      CAST(sum(CASE WHEN n < 10 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS violating_groups,
-                      CAST(sum(CASE WHEN n < 10 THEN n ELSE 0 END)
-                        AS BIGINT) AS violating_rows
-               FROM g GROUP BY lvl),
-       ch AS (SELECT CAST(min(lvl) AS BIGINT) AS chosen_level
-              FROM per WHERE violating_rows = 0)
-       SELECT CAST(per.lvl AS BIGINT) AS lvl, per.n_rows, per.n_groups,
-              per.min_group, per.violating_groups, per.violating_rows,
-              CAST(CASE WHEN per.violating_rows = 0 THEN 1 ELSE 0 END
-                AS BIGINT) AS satisfies_k10,
-              ch.chosen_level
-       FROM per, ch""",
-)
-def q386(spark, sf_dir):
-    """k-anonymity audit over a generalization CHAIN (k=10) — the
-    release-governance gate for quasi-identifiers (lang, source,
-    n_chars): five levels where each strictly coarsens the previous
-    ((lang, source, chars div 16) -> div 128 -> (lang, source) ->
-    (lang) -> all), so violating rows and violating groups are
-    MONOTONE non-increasing by the refinement argument (any fine
-    group inside a >= k coarse group only grows when merged) and the
-    chosen level = the minimum level with zero violations is well-
-    defined (level 4 is one group of N).  Shape: each row explodes to
-    its 5 (level, group-key) cells, ONE map-side-combinable groupBy
-    to the bounded group table, one per-level rollup — the full
-    lattice audit in a single corpus pass, no per-level rescans."""
-    docs = _t(spark, sf_dir, "documents")
-    lv = docs.selectExpr(
-        "explode(array("
-        "struct(0 AS lvl, concat(lang, '|', source, '|', "
-        "CAST(n_chars div 16 AS STRING)) AS gkey), "
-        "struct(1 AS lvl, concat(lang, '|', source, '|', "
-        "CAST(n_chars div 128 AS STRING)) AS gkey), "
-        "struct(2 AS lvl, concat(lang, '|', source) AS gkey), "
-        "struct(3 AS lvl, lang AS gkey), "
-        "struct(4 AS lvl, 'all' AS gkey))) AS s"
-    ).select("s.lvl", "s.gkey")
-    g = lv.groupBy("lvl", "gkey").agg(F.count("*").alias("n"))
-    per = g.groupBy("lvl").agg(
-        F.sum("n").cast("long").alias("n_rows"),
-        F.count("*").cast("long").alias("n_groups"),
-        F.min("n").cast("long").alias("min_group"),
-        F.sum(F.when(F.col("n") < 10, 1).otherwise(0)).cast("long")
-        .alias("violating_groups"),
-        F.sum(F.when(F.col("n") < 10, F.col("n")).otherwise(0)).cast("long")
-        .alias("violating_rows"),
-    )
-    per = per.withColumn(
-        "satisfies_k10",
-        F.when(F.col("violating_rows") == 0, 1).otherwise(0).cast("long"),
-    )
-    ch = per.filter("satisfies_k10 = 1").agg(
-        F.min("lvl").cast("long").alias("chosen_level"))
-    return per.crossJoin(F.broadcast(ch)).select(
-        F.col("lvl").cast("long").alias("lvl"), "n_rows", "n_groups",
-        "min_group", "violating_groups", "violating_rows",
-        "satisfies_k10", "chosen_level",
-    )
-
-
-# --- watermark late-data planning (q387) --------------------------------------------
-
-
-@query(
-    "q387_watermark_planning",
-    """WITH d AS (SELECT event_id,
-                CASE WHEN event_id % 10 < 9
-                     THEN (event_id * 31) % 60
-                     ELSE 300 + (event_id * 31) % 3300
-                END AS delay
-              FROM events),
-       w AS (SELECT CAST(w.w AS BIGINT) AS watermark_s
-             FROM (VALUES (60), (300), (900), (3600)) w(w))
-       SELECT w.watermark_s,
-              CAST(count(*) AS BIGINT) AS n_events,
-              CAST(sum(CASE WHEN d.delay > w.watermark_s
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-              CAST(sum(CASE WHEN d.delay > w.watermark_s
-                       THEN 1 ELSE 0 END) AS DOUBLE)
-                / CAST(count(*) AS DOUBLE) AS drop_rate,
-              CAST(max(CASE WHEN d.delay <= w.watermark_s
-                       THEN d.delay ELSE -1 END) AS BIGINT)
-                AS max_kept_delay,
-              CAST(sum(CASE WHEN d.delay <= w.watermark_s
-                       THEN 1 ELSE 0 END) * w.watermark_s AS BIGINT)
-                AS state_cost_event_seconds
-       FROM w CROSS JOIN d
-       GROUP BY w.watermark_s""",
-)
-def q387(spark, sf_dir):
-    """Watermark policy planning for Structured Streaming — the
-    completeness/state-cost tradeoff curve that decides
-    withWatermark() before the job ships: a deterministic two-regime
-    arrival-delay model (90% prompt, delay < 60 s; 10% stragglers,
-    300..3599 s — the checkpoint-recovery / mobile-client tail), four
-    candidate watermarks evaluated in ONE corpus pass (4-row policy
-    table broadcast against the event stream), emitting per policy
-    the dropped-event count (delay > W is dropped exactly as a
-    too-late row under watermark W), the drop rate as one IEEE
-    division, the max surviving delay, and the state-retention cost
-    proxy kept_events x W — the number that says a 3600 s watermark
-    buys 0 drops at 60x the state of the 60 s policy.  Everything
-    integer except the single division; map-side combinable."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.when(F.col("event_id") % 10 < 9, (F.col("event_id") * 31) % 60)
-        .otherwise(300 + (F.col("event_id") * 31) % 3300).alias("delay"),
-    )
-    w = spark.createDataFrame(
-        [(60,), (300,), (900,), (3600,)], "watermark_s LONG")
-    late = F.col("delay") > F.col("watermark_s")
-    return (
-        F.broadcast(w).crossJoin(ev)
-        .groupBy("watermark_s")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(F.when(late, 1).otherwise(0)).cast("long")
-            .alias("n_dropped"),
-            (F.sum(F.when(late, 1).otherwise(0)).cast("double")
-             / F.count("*").cast("double")).alias("drop_rate"),
-            F.max(F.when(~late, F.col("delay")).otherwise(-1)).cast("long")
-            .alias("max_kept_delay"),
-            (F.sum(F.when(~late, 1).otherwise(0))
-             * F.first("watermark_s")).cast("long")
-            .alias("state_cost_event_seconds"),
-        )
-    )
-
-
-# --- Merkle-tree replica diff (q388) ------------------------------------------------
-
-
-@query(
-    "q388_merkle_replica_diff",
-    """WITH l0 AS (SELECT doc_id,
-                md5(text) AS ha,
-                md5(CASE WHEN doc_id % 97 = 13 THEN text || 'X'
-                         ELSE text END) AS hb
-              FROM documents),
-       l1 AS (SELECT doc_id // 16 AS node,
-                     md5(string_agg(ha, '' ORDER BY doc_id)) AS ha,
-                     md5(string_agg(hb, '' ORDER BY doc_id)) AS hb
-              FROM l0 GROUP BY doc_id // 16),
-       l2 AS (SELECT node // 16 AS node,
-                     md5(string_agg(ha, '' ORDER BY node)) AS ha,
-                     md5(string_agg(hb, '' ORDER BY node)) AS hb
-              FROM l1 GROUP BY node // 16),
-       l3 AS (SELECT node // 16 AS node,
-                     md5(string_agg(ha, '' ORDER BY node)) AS ha,
-                     md5(string_agg(hb, '' ORDER BY node)) AS hb
-              FROM l2 GROUP BY node // 16),
-       rt AS (SELECT 0 AS node,
-                     md5(string_agg(ha, '' ORDER BY node)) AS ha,
-                     md5(string_agg(hb, '' ORDER BY node)) AS hb
-              FROM l3)
-       SELECT CAST(0 AS BIGINT) AS lvl,
-              CAST(count(*) AS BIGINT) AS n_nodes,
-              CAST(sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) AS BIGINT)
-                AS n_diff
-       FROM l0
-       UNION ALL
-       SELECT 1, count(*),
-              sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) FROM l1
-       UNION ALL
-       SELECT 2, count(*),
-              sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) FROM l2
-       UNION ALL
-       SELECT 3, count(*),
-              sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) FROM l3
-       UNION ALL
-       SELECT 4, count(*),
-              sum(CASE WHEN ha <> hb THEN 1 ELSE 0 END) FROM rt""",
-)
-def q388(spark, sf_dir):
-    """Merkle-tree replica reconciliation — the anti-entropy diff
-    every multi-region table replica runs (Dynamo/Cassandra repair:
-    compare roots, drill into differing subtrees only, never ship the
-    table): fanout-16 tree over doc_id ranges, node hash = md5 of the
-    child hex digests concatenated in child order (Spark's
-    sort_array(collect_list(struct)) mirrors string_agg ORDER BY —
-    hex md5 strings are engine-identical so every level compares
-    bitwise); replica B deviates on doc_id % 97 = 13 (simulated
-    missed updates).  Emits n_nodes / n_diff per level: leaf n_diff
-    is exactly the corrupted-doc count, and each level's diff set is
-    the ancestor closure of the one below — the drill-down cost is 16
-    x n_diff(parent), the log-vs-linear reconciliation argument.
-    Shape: 4 combinable groupBys over geometrically shrinking tables;
-    the leaf pass is the only corpus-sized one."""
-    docs = _t(spark, sf_dir, "documents")
-    cur = docs.select(
-        F.col("doc_id").alias("node"),
-        F.md5("text").alias("ha"),
-        F.md5(F.when(F.col("doc_id") % 97 == 13,
-                     F.concat(F.col("text"), F.lit("X")))
-              .otherwise(F.col("text"))).alias("hb"),
-    )
-    levels = [
-        cur.agg(
-            F.lit(0).cast("long").alias("lvl"),
-            F.count("*").cast("long").alias("n_nodes"),
-            F.sum(F.when(F.col("ha") != F.col("hb"), 1).otherwise(0))
-            .cast("long").alias("n_diff"),
-        ).select("lvl", "n_nodes", "n_diff")
-    ]
-    for lv in range(1, 5):
-        parent = F.expr("node div 16") if lv < 4 else F.lit(0)
-        cur = (
-            cur.groupBy(parent.alias("pnode"))
-            .agg(
-                F.md5(F.array_join(F.expr(
-                    "transform(array_sort(collect_list(struct(node, ha))), "
-                    "s -> s.ha)"), "")).alias("ha"),
-                F.md5(F.array_join(F.expr(
-                    "transform(array_sort(collect_list(struct(node, hb))), "
-                    "s -> s.hb)"), "")).alias("hb"),
-            )
-            .withColumnRenamed("pnode", "node")
-        )
-        levels.append(
-            cur.agg(
-                F.lit(lv).cast("long").alias("lvl"),
-                F.count("*").cast("long").alias("n_nodes"),
-                F.sum(F.when(F.col("ha") != F.col("hb"), 1).otherwise(0))
-                .cast("long").alias("n_diff"),
-            ).select("lvl", "n_nodes", "n_diff")
-        )
-    out = levels[0]
-    for df in levels[1:]:
-        out = out.unionAll(df)
-    return out
-
-
 # --- geo density hotspot clustering (q389) ------------------------------------------
 
 _HOTSPOT_PTS_SQL = """SELECT doc_id,
@@ -22703,6 +9838,7 @@ _HOTSPOT_PTS_SQL = """SELECT doc_id,
               CAST(max(dense.cy) AS BIGINT) AS max_cy
        FROM comp JOIN dense ON dense.cell = comp.node
        GROUP BY comp.component""",
+    kind="operator",
 )
 def q389(spark, sf_dir):
     """Grid-density hotspot clustering of the geocoded corpus — the
@@ -22771,1863 +9907,6 @@ def q389(spark, sf_dir):
     )
 
 
-# --- left-deep join-order planning (q390) -------------------------------------------
-
-_JOIN_ORDERS = [
-    ("C>O>L>S", "01", "012"),
-    ("O>C>L>S", "01", "012"),
-    ("O>L>C>S", "12", "012"),
-    ("O>L>S>C", "12", "123"),
-    ("L>O>C>S", "12", "012"),
-    ("L>O>S>C", "12", "123"),
-    ("L>S>O>C", "23", "123"),
-    ("S>L>O>C", "23", "123"),
-]
-
-
-@query(
-    "q390_join_order_planning",
-    """WITH st AS (SELECT
-         (SELECT count(*) FROM customer) AS c0,
-         (SELECT count(*) FROM orders) AS c1,
-         (SELECT count(*) FROM lineitem) AS c2,
-         (SELECT count(*) FROM supplier) AS c3,
-         greatest((SELECT count(DISTINCT c_custkey) FROM customer),
-                  (SELECT count(DISTINCT o_custkey) FROM orders)) AS n01,
-         greatest((SELECT count(DISTINCT o_orderkey) FROM orders),
-                  (SELECT count(DISTINCT l_orderkey) FROM lineitem))
-           AS n12,
-         greatest((SELECT count(DISTINCT l_suppkey) FROM lineitem),
-                  (SELECT count(DISTINCT s_suppkey) FROM supplier))
-           AS n23),
-       e1 AS (SELECT *, c0*c1 // n01 AS e01, c1*c2 // n12 AS e12,
-                     c2*c3 // n23 AS e23 FROM st),
-       e2 AS (SELECT *, e01*c2 // n12 AS e012, e12*c3 // n23 AS e123
-              FROM e1),
-       e3 AS (SELECT *, e012*c3 // n23 AS e0123 FROM e2),
-       ords AS (SELECT * FROM (VALUES
-         ('C>O>L>S','01','012'), ('O>C>L>S','01','012'),
-         ('O>L>C>S','12','012'), ('O>L>S>C','12','123'),
-         ('L>O>C>S','12','012'), ('L>O>S>C','12','123'),
-         ('L>S>O>C','23','123'), ('S>L>O>C','23','123'))
-         o(lbl, p2, p3)),
-       y AS (SELECT lbl,
-               CAST(CASE p2 WHEN '01' THEN e01 WHEN '12' THEN e12
-                    ELSE e23 END AS BIGINT) AS est_2,
-               CAST(CASE p3 WHEN '012' THEN e012 ELSE e123 END
-                 AS BIGINT) AS est_3,
-               CAST(e0123 AS BIGINT) AS est_4
-             FROM ords, e3),
-       z AS (SELECT lbl, est_2, est_3, est_4,
-                    est_2 + est_3 + est_4 AS cost FROM y),
-       b1 AS (SELECT min(cost) AS bc FROM z),
-       b2 AS (SELECT min(lbl) AS bl FROM z, b1 WHERE cost = bc)
-       SELECT z.lbl AS ord_label, z.est_2, z.est_3, z.est_4,
-              CAST(z.cost AS BIGINT) AS cost,
-              CAST(CASE WHEN z.cost = b1.bc AND z.lbl = b2.bl
-                   THEN 1 ELSE 0 END AS BIGINT) AS is_best
-       FROM z, b1, b2""",
-)
-def q390(spark, sf_dir):
-    """Selinger-style left-deep join-order planning over REAL catalog
-    statistics — the System R enumeration Catalyst itself runs, as an
-    oracle-checked query: the chain join graph customer-(custkey)-
-    orders-(orderkey)-lineitem-(suppkey)-supplier admits exactly
-    2^(n-1) = 8 cross-product-free left-deep orders (enumerated as a
-    literal — the optimizer's search space is structural, never
-    data-dependent); intermediate cardinalities use the textbook
-    |A join B| = |A||B| / max(ndv_A, ndv_B) estimate computed
-    SEGMENT-CANONICALLY (right-extension recursion with pinned floor
-    division, so shared prefixes share estimates bitwise) from exact
-    count / countDistinct stats gathered in four table scans; plan
-    cost = sum of the three prefix-join sizes, best = (min cost, lex
-    label) — the C-first / O-first orders tie by symmetry and
-    exercise the tie rule.  Exact BIGINT throughout (catalog-scale
-    planners switch to doubles; the relational shape is identical).
-    Shape: 4 stat scans -> 1-row stats -> 8-row broadcast enumerate —
-    planning cost is CONSTANT in data size."""
-    c = _t(spark, sf_dir, "customer").agg(
-        F.count("*").alias("c0"),
-        F.countDistinct("c_custkey").alias("dc_cust"))
-    o = _t(spark, sf_dir, "orders").agg(
-        F.count("*").alias("c1"),
-        F.countDistinct("o_custkey").alias("do_cust"),
-        F.countDistinct("o_orderkey").alias("do_ord"))
-    li = _t(spark, sf_dir, "lineitem").agg(
-        F.count("*").alias("c2"),
-        F.countDistinct("l_orderkey").alias("dl_ord"),
-        F.countDistinct("l_suppkey").alias("dl_supp"))
-    s = _t(spark, sf_dir, "supplier").agg(
-        F.count("*").alias("c3"),
-        F.countDistinct("s_suppkey").alias("ds_supp"))
-    st = (
-        c.crossJoin(o).crossJoin(li).crossJoin(s)
-        .selectExpr(
-            "c0", "c1", "c2", "c3",
-            "greatest(dc_cust, do_cust) AS n01",
-            "greatest(do_ord, dl_ord) AS n12",
-            "greatest(dl_supp, ds_supp) AS n23",
-        )
-        .selectExpr("*", "c0*c1 div n01 AS e01", "c1*c2 div n12 AS e12",
-                    "c2*c3 div n23 AS e23")
-        .selectExpr("*", "e01*c2 div n12 AS e012",
-                    "e12*c3 div n23 AS e123")
-        .selectExpr("*", "e012*c3 div n23 AS e0123")
-    )
-    ords = spark.createDataFrame(
-        _JOIN_ORDERS, "lbl STRING, p2 STRING, p3 STRING")
-    z = (
-        F.broadcast(ords).crossJoin(F.broadcast(st))
-        .selectExpr(
-            "lbl",
-            "CAST(CASE p2 WHEN '01' THEN e01 WHEN '12' THEN e12 "
-            "ELSE e23 END AS BIGINT) AS est_2",
-            "CAST(CASE p3 WHEN '012' THEN e012 ELSE e123 END AS BIGINT) "
-            "AS est_3",
-            "CAST(e0123 AS BIGINT) AS est_4",
-        )
-        .withColumn("cost", (F.col("est_2") + F.col("est_3")
-                             + F.col("est_4")).cast("long"))
-    )
-    b1 = z.agg(F.min("cost").alias("bc"))
-    b2 = (z.crossJoin(F.broadcast(b1)).filter(F.col("cost") == F.col("bc"))
-          .agg(F.min("lbl").alias("bl")))
-    return (
-        z.crossJoin(F.broadcast(b1)).crossJoin(F.broadcast(b2))
-        .select(
-            F.col("lbl").alias("ord_label"), "est_2", "est_3", "est_4",
-            "cost",
-            F.when((F.col("cost") == F.col("bc"))
-                   & (F.col("lbl") == F.col("bl")), 1).otherwise(0)
-            .cast("long").alias("is_best"),
-        )
-    )
-
-
-# --- block-level delta transfer (q391) ----------------------------------------------
-
-
-@query(
-    "q391_delta_transfer",
-    """WITH v AS (SELECT doc_id, text AS v1,
-                CASE WHEN doc_id % 7 = 2 THEN
-                       substr(text, 1, CAST(length(text) // 2 AS INT))
-                       || 'EDITSEGMENT'
-                       || substr(text,
-                                 CAST(length(text) // 2 + 1 AS INT))
-                     WHEN doc_id % 7 = 3 THEN text || ' APPENDED TAIL'
-                     ELSE text END AS v2,
-                CASE WHEN doc_id % 7 = 2 THEN 'insert_middle'
-                     WHEN doc_id % 7 = 3 THEN 'append'
-                     ELSE 'unchanged' END AS edit_class
-              FROM documents),
-       b1 AS (SELECT DISTINCT doc_id, blk FROM (
-                SELECT doc_id,
-                       unnest(list_filter(list_transform(range(1, 41),
-                         i -> CASE WHEN i = 1 AND length(v1) > 1280
-                              THEN error('q391: fixture outgrew 40 blocks')
-                              ELSE substr(v1, CAST((i-1)*32+1 AS INT), 32)
-                              END),
-                         s -> length(s) > 0)) AS blk
-                FROM v)),
-       b2 AS (SELECT doc_id, edit_class,
-                     unnest(list_filter(list_transform(range(1, 41),
-                       i -> CASE WHEN i = 1 AND length(v2) > 1280
-                            THEN error('q391: fixture outgrew 40 blocks')
-                            ELSE substr(v2, CAST((i-1)*32+1 AS INT), 32)
-                            END),
-                       s -> length(s) > 0)) AS blk
-              FROM v),
-       j AS (SELECT b2.doc_id, b2.edit_class,
-                    CASE WHEN b1.blk IS NULL THEN 1 ELSE 0 END AS xfer
-             FROM b2 LEFT JOIN b1
-               ON b1.doc_id = b2.doc_id AND b1.blk = b2.blk)
-       SELECT edit_class,
-              CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-              CAST(count(*) AS BIGINT) AS v2_blocks,
-              CAST(sum(xfer) AS BIGINT) AS transferred_blocks,
-              CAST(sum(xfer) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-                AS transfer_rate
-       FROM j GROUP BY edit_class""",
-)
-def q391(spark, sf_dir):
-    """Block-level delta-transfer accounting between two snapshot
-    versions — the rsync/recrawl-economics number (ship only the
-    32-char blocks of v2 absent from the SAME doc's v1 block set):
-    three deterministic edit classes prove the fixed-blocking
-    tradeoff — APPEND edits transfer only the tail block(s) because
-    earlier block offsets are untouched, while a MIDDLE INSERT shifts
-    every later block boundary and forces ~half the doc across the
-    wire (the shift-sensitivity that motivates content-defined
-    chunking, q308), and unchanged docs transfer exactly 0.  Both
-    engines enumerate blocks over the SAME fixed range(1,41) with the
-    q180 loud error() outgrowth guard (max doc 569+11 chars << 1280);
-    the per-doc (doc_id, block) anti-membership is one equi-join
-    whose candidate volume is the block count — linear, shuffled on
-    doc_id, never cross-doc.  transfer_rate is the single IEEE
-    division of exact counts."""
-    docs = _t(spark, sf_dir, "documents")
-    v = docs.select(
-        "doc_id",
-        F.col("text").alias("v1"),
-        F.expr(
-            "CASE WHEN doc_id % 7 = 2 THEN "
-            "substring(text, 1, CAST(length(text) div 2 AS INT)) "
-            "|| 'EDITSEGMENT' "
-            "|| substring(text, CAST(length(text) div 2 + 1 AS INT), "
-            "1000000) "
-            "WHEN doc_id % 7 = 3 THEN text || ' APPENDED TAIL' "
-            "ELSE text END").alias("v2"),
-        F.expr(
-            "CASE WHEN doc_id % 7 = 2 THEN 'insert_middle' "
-            "WHEN doc_id % 7 = 3 THEN 'append' "
-            "ELSE 'unchanged' END").alias("edit_class"),
-    )
-    blk = ("filter(transform(sequence(1, 40), i -> CASE WHEN i = 1 "
-           "AND length({c}) > 1280 THEN "
-           "raise_error('q391: fixture outgrew 40 blocks') "
-           "ELSE substring({c}, CAST((i-1)*32+1 AS INT), 32) END), "
-           "s -> length(s) > 0)")
-    b1 = (
-        v.select("doc_id",
-                 F.explode(F.expr(blk.format(c="v1"))).alias("blk"))
-        .distinct()
-    )
-    b2 = v.select(
-        "doc_id", "edit_class",
-        F.explode(F.expr(blk.format(c="v2"))).alias("blk"))
-    j = b2.join(
-        b1.withColumnRenamed("blk", "blk1"),
-        (b2["doc_id"] == b1["doc_id"]) & (F.col("blk") == F.col("blk1")),
-        "left",
-    ).select(
-        b2["doc_id"].alias("doc_id"), "edit_class",
-        F.when(F.col("blk1").isNull(), 1).otherwise(0).alias("xfer"),
-    )
-    return j.groupBy("edit_class").agg(
-        F.countDistinct("doc_id").cast("long").alias("n_docs"),
-        F.count("*").cast("long").alias("v2_blocks"),
-        F.sum("xfer").cast("long").alias("transferred_blocks"),
-        (F.sum("xfer").cast("double") / F.count("*").cast("double"))
-        .alias("transfer_rate"),
-    )
-
-
-# --- Simpson's-paradox detector (q392) ----------------------------------------------
-
-
-@query(
-    "q392_simpsons_paradox",
-    """WITH a AS (SELECT doc_id % 2 AS stratum,
-                CASE WHEN (doc_id // 2) % 10 < 1 + 8 * (doc_id % 2)
-                     THEN 'A' ELSE 'B' END AS variant,
-                CASE WHEN (doc_id * 2654435761
-                           + (doc_id // 20) * 567) % 1000 <
-                          200 + 500 * (doc_id % 2)
-                          + CASE WHEN (doc_id // 2) % 10
-                                      >= 1 + 8 * (doc_id % 2)
-                                 THEN 100 ELSE 0 END
-                     THEN 1 ELSE 0 END AS conv
-              FROM documents),
-       s AS (SELECT stratum,
-                    CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_a,
-                    CAST(sum(CASE WHEN variant = 'A' THEN conv ELSE 0
-                             END) AS BIGINT) AS succ_a,
-                    CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_b,
-                    CAST(sum(CASE WHEN variant = 'B' THEN conv ELSE 0
-                             END) AS BIGINT) AS succ_b
-             FROM a GROUP BY stratum),
-       p AS (SELECT CAST(-1 AS BIGINT) AS stratum,
-                    CAST(sum(n_a) AS BIGINT) AS n_a,
-                    CAST(sum(succ_a) AS BIGINT) AS succ_a,
-                    CAST(sum(n_b) AS BIGINT) AS n_b,
-                    CAST(sum(succ_b) AS BIGINT) AS succ_b
-             FROM s),
-       u AS (SELECT CAST(stratum AS BIGINT) AS stratum, n_a, succ_a,
-                    n_b, succ_b FROM s
-             UNION ALL SELECT * FROM p)
-       SELECT stratum, n_a, succ_a, n_b, succ_b,
-              CAST(CASE WHEN succ_b * n_a > succ_a * n_b
-                   THEN 1 ELSE 0 END AS BIGINT) AS b_wins
-       FROM u""",
-)
-def q392(spark, sf_dir):
-    """Simpson's-paradox detector for A/B readouts — the stratified
-    vs pooled sign-flip audit every experimentation platform needs
-    before q347's Wilson bound is trusted (the kidney-stone shape):
-    variant B converts 10 pp better than A in BOTH strata
-    (deterministic per-mille rates 200/700 for A, +100 for B), but
-    A's exposure is skewed toward the high-base stratum (A share 1
-    vs 9 tenths), so the POOLED comparison flips — pooled A ~650 vs
-    B ~350 per-mille by the exact weighted arithmetic; margins are
-    fat enough that the realized deterministic rates keep the flip
-    at every SF (the first cut used 5 strata with 5 pp margins and
-    25-sample cells drowned the bonus — sample-size floors are part
-    of the fixture contract).  The outcome hash mixes in
-    (doc_id div 20)*567 so consecutive docs within a (stratum,
-    share-bucket) cell step the per-mille lattice by 787 (coprime to
-    1000) — equidistributed even over 25-doc cells.  Winners are
-    decided by the exact integer cross-multiplication
-    succ_b*n_a > succ_a*n_b (no rate division anywhere), emitted per
-    stratum plus the pooled -1 row whose flag DISAGREES with both
-    strata — the paradox certificate.  One corpus pass, one
-    bounded groupBy, one rollup."""
-    docs = _t(spark, sf_dir, "documents")
-    a = docs.select(
-        (F.col("doc_id") % 2).alias("stratum"),
-        F.expr("CASE WHEN (doc_id div 2) % 10 < 1 + 8 * (doc_id % 2) "
-               "THEN 'A' ELSE 'B' END").alias("variant"),
-        F.expr(
-            "CASE WHEN (doc_id * 2654435761 + (doc_id div 20) * 567) "
-            "% 1000 < 200 + 500 * (doc_id % 2) "
-            "+ CASE WHEN (doc_id div 2) % 10 >= 1 + 8 * (doc_id % 2) "
-            "THEN 100 ELSE 0 END THEN 1 ELSE 0 END").alias("conv"),
-    )
-    s = a.groupBy("stratum").agg(
-        F.sum(F.when(F.col("variant") == "A", 1).otherwise(0))
-        .cast("long").alias("n_a"),
-        F.sum(F.when(F.col("variant") == "A", F.col("conv")).otherwise(0))
-        .cast("long").alias("succ_a"),
-        F.sum(F.when(F.col("variant") == "B", 1).otherwise(0))
-        .cast("long").alias("n_b"),
-        F.sum(F.when(F.col("variant") == "B", F.col("conv")).otherwise(0))
-        .cast("long").alias("succ_b"),
-    )
-    p = s.agg(
-        F.lit(-1).cast("long").alias("stratum"),
-        F.sum("n_a").cast("long").alias("n_a"),
-        F.sum("succ_a").cast("long").alias("succ_a"),
-        F.sum("n_b").cast("long").alias("n_b"),
-        F.sum("succ_b").cast("long").alias("succ_b"),
-    ).select("stratum", "n_a", "succ_a", "n_b", "succ_b")
-    u = s.select(F.col("stratum").cast("long").alias("stratum"),
-                 "n_a", "succ_a", "n_b", "succ_b").unionAll(p)
-    return u.withColumn(
-        "b_wins",
-        F.when(F.col("succ_b") * F.col("n_a")
-               > F.col("succ_a") * F.col("n_b"), 1).otherwise(0)
-        .cast("long"),
-    )
-
-
-# --- elastic reshard migration audit (q393) -----------------------------------------
-
-
-@query(
-    "q393_reshard_migration",
-    """WITH u AS (SELECT DISTINCT 'k' || CAST(doc_id AS VARCHAR) AS k
-                  FROM documents),
-       hm AS (SELECT k,
-                CAST(CAST('0x' || substr(md5('mod:' || k), 1, 8)
-                     AS UBIGINT) AS BIGINT) AS h
-              FROM u),
-       wts AS (SELECT k, s.range AS node,
-                CAST(CAST('0x' || substr(md5('grow' ||
-                       CAST(s.range AS VARCHAR) || ':' || k), 1, 8)
-                     AS UBIGINT) AS BIGINT) AS w
-               FROM u, range(0, 20) s),
-       a16 AS (SELECT k, max(w * 32 + (31 - node)) AS c16
-               FROM wts WHERE node < 16 GROUP BY k),
-       a20 AS (SELECT k, max(w * 32 + (31 - node)) AS c20
-               FROM wts GROUP BY k),
-       asg AS (SELECT hm.k,
-                      hm.h % 16 AS m16, hm.h % 20 AS m20,
-                      31 - (a16.c16 % 32) AS h16,
-                      31 - (a20.c20 % 32) AS h20
-               FROM hm JOIN a16 USING (k) JOIN a20 USING (k))
-       SELECT CAST(count(*) AS BIGINT) AS n_keys,
-              CAST(sum(CASE WHEN m16 <> m20 THEN 1 ELSE 0 END)
-                AS BIGINT) AS moved_mod,
-              CAST(sum(CASE WHEN h16 <> h20 THEN 1 ELSE 0 END)
-                AS BIGINT) AS moved_hrw,
-              CAST(sum(CASE WHEN h20 >= 16 THEN 1 ELSE 0 END)
-                AS BIGINT) AS new_node_keys,
-              CAST(sum(CASE WHEN m16 <> m20 THEN 1 ELSE 0 END)
-                AS DOUBLE) / CAST(count(*) AS DOUBLE) AS moved_mod_rate,
-              CAST(sum(CASE WHEN h16 <> h20 THEN 1 ELSE 0 END)
-                AS DOUBLE) / CAST(count(*) AS DOUBLE) AS moved_hrw_rate
-       FROM asg""",
-)
-def q393(spark, sf_dir):
-    """Elastic reshard migration audit, 16 -> 20 nodes — THE argument
-    for rendezvous/consistent hashing over modulo placement when a
-    fleet GROWS (q293 covers node removal; this is the capacity-add
-    direction): under h % n placement almost every key moves
-    (P[h%16 = h%20] = 1/80 of the residue lattice... ~5%), while the
-    HRW argmax moves EXACTLY the keys whose 20-node winner is one of
-    the 4 new nodes — the emitted new_node_keys column equals
-    moved_hrw by construction (a key's max over the old 16 weights
-    is unchanged, so its assignment changes iff a new node's weight
-    beats them all), the minimal-disruption optimality PROOF at ~4/20
-    of the corpus.  Weights via the pinned md5 conv/UBIGINT idiom;
-    both policies and both fleet sizes in ONE pass over a 20-row
-    explode feeding two map-side-combinable integer argmaxes
-    (w*32 + (31-node), ties to lowest node); rates are single IEEE
-    divisions of the exact counts."""
-    docs = _t(spark, sf_dir, "documents")
-    u = docs.select(
-        F.concat(F.lit("k"), F.col("doc_id").cast("string")).alias("k")
-    ).distinct()
-    hm = u.withColumn(
-        "h",
-        F.conv(F.substring(F.md5(F.concat(F.lit("mod:"), F.col("k"))),
-                           1, 8), 16, 10).cast("long"),
-    )
-    wts = u.select(
-        "k", F.explode(F.sequence(F.lit(0), F.lit(19))).alias("node")
-    ).withColumn(
-        "w",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("grow"), F.col("node").cast("string"),
-                               F.lit(":"), F.col("k"))), 1, 8),
-            16, 10,
-        ).cast("long"),
-    )
-    code = F.col("w") * 32 + (31 - F.col("node"))
-    a16 = (wts.filter(F.col("node") < 16).groupBy("k")
-           .agg(F.max(code).alias("c16")))
-    a20 = wts.groupBy("k").agg(F.max(code).alias("c20"))
-    asg = (
-        hm.join(a16, "k").join(a20, "k")
-        .select(
-            (F.col("h") % 16).alias("m16"), (F.col("h") % 20).alias("m20"),
-            (31 - F.col("c16") % 32).alias("h16"),
-            (31 - F.col("c20") % 32).alias("h20"),
-        )
-    )
-    modmove = F.col("m16") != F.col("m20")
-    hrwmove = F.col("h16") != F.col("h20")
-    return asg.agg(
-        F.count("*").cast("long").alias("n_keys"),
-        F.sum(F.when(modmove, 1).otherwise(0)).cast("long")
-        .alias("moved_mod"),
-        F.sum(F.when(hrwmove, 1).otherwise(0)).cast("long")
-        .alias("moved_hrw"),
-        F.sum(F.when(F.col("h20") >= 16, 1).otherwise(0)).cast("long")
-        .alias("new_node_keys"),
-        (F.sum(F.when(modmove, 1).otherwise(0)).cast("double")
-         / F.count("*").cast("double")).alias("moved_mod_rate"),
-        (F.sum(F.when(hrwmove, 1).otherwise(0)).cast("double")
-         / F.count("*").cast("double")).alias("moved_hrw_rate"),
-    )
-
-
-# --- columnar encoding selection (q394) ---------------------------------------------
-
-
-def _enc_block_sql(name: str, cexpr: str, is_string: bool) -> str:
-    if is_string:
-        plain = f"(SELECT CAST(sum(length({cexpr})) AS BIGINT) FROM documents)"
-        dstore = (f"(SELECT CAST(sum(length(v)) AS BIGINT) FROM "
-                  f"(SELECT DISTINCT {cexpr} AS v FROM documents))")
-        width = f"(SELECT CAST(max(length({cexpr})) AS BIGINT) FROM documents)"
-    else:
-        plain = "(SELECT CAST(8 * count(*) AS BIGINT) FROM documents)"
-        dstore = (f"(SELECT CAST(8 * count(DISTINCT {cexpr}) AS BIGINT) "
-                  f"FROM documents)")
-        width = "CAST(8 AS BIGINT)"
-    return f"""SELECT '{name}' AS col_name,
-         (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n,
-         (SELECT CAST(count(DISTINCT {cexpr}) AS BIGINT)
-          FROM documents) AS ndv,
-         (SELECT CAST(1 + sum(CASE WHEN a.{name}_v <> b.{name}_v
-                              THEN 1 ELSE 0 END) AS BIGINT)
-          FROM (SELECT doc_id, {cexpr} AS {name}_v FROM documents) a
-          JOIN (SELECT doc_id, {cexpr} AS {name}_v FROM documents) b
-            ON b.doc_id = a.doc_id + 1) AS runs,
-         {plain} AS plain_bytes,
-         {dstore} AS dict_store,
-         {width} AS width"""
-
-
-_ENC_COLS = [
-    ("lang", "lang", "lang", True),
-    ("src", "source", "source", True),
-    ("blk", "doc_id // 50", "doc_id div 50", False),
-    ("txt", "text", "text", True),
-]
-
-
-def _enc_oracle_sql() -> str:
-    blocks = "\n       UNION ALL\n       ".join(
-        _enc_block_sql(n, c, s) for n, c, _, s in _ENC_COLS)
-    return f"""WITH p AS ({blocks}),
-       e AS (SELECT col_name, n, ndv, runs, plain_bytes,
-                    dict_store + (n * (CASE WHEN ndv = 1 THEN 0
-                        ELSE length(bin(ndv - 1)) END) + 7) // 8
-                      AS dict_bytes,
-                    runs * (width + 4) AS rle_bytes
-             FROM p)
-       SELECT col_name, n, ndv, runs, plain_bytes,
-              CAST(dict_bytes AS BIGINT) AS dict_bytes,
-              CAST(rle_bytes AS BIGINT) AS rle_bytes,
-              CASE WHEN plain_bytes <= dict_bytes
-                    AND plain_bytes <= rle_bytes THEN 'plain'
-                   WHEN dict_bytes <= rle_bytes THEN 'dict'
-                   ELSE 'rle' END AS best_encoding
-       FROM e"""
-
-
-@query("q394_encoding_selection", _enc_oracle_sql())
-def q394(spark, sf_dir):
-    """Columnar encoding selection — the per-column writer decision
-    every Parquet/ORC encoder makes (PLAIN vs DICTIONARY vs RLE),
-    planned from exact column statistics: bytes_plain = data bytes,
-    bytes_dict = dictionary store + n ceil(log2(ndv))-bit codes (the
-    shared bin()-length idiom computes the bit width), bytes_rle =
-    runs x (width + 4), where runs = 1 + adjacent-change count in
-    doc_id order (a dense-key offset-1 equi-join — linear, never a
-    global window).  The four profiled columns exercise every
-    winner: lang/source (tiny lexicons) pick DICT, the sorted
-    doc_id div 50 column (~n/50 runs) picks RLE, and high-cardinality
-    text stays PLAIN (its dictionary IS the data plus code overhead).
-    Tie order plain < dict < rle is pinned in one CASE chain shared
-    by both engines.  Per column: one stats aggregation, one
-    distinct-store aggregation, one adjacency join — all linear."""
-    docs = _t(spark, sf_dir, "documents")
-    outs = []
-    for name, _, cexpr, is_string in _ENC_COLS:
-        c = docs.selectExpr("doc_id", f"{cexpr} AS v")
-        if is_string:
-            st = c.agg(
-                F.count("*").cast("long").alias("n"),
-                F.countDistinct("v").cast("long").alias("ndv"),
-                F.sum(F.length("v")).cast("long").alias("plain_bytes"),
-                F.max(F.length("v")).cast("long").alias("width"),
-            )
-            ds = (c.select("v").distinct()
-                  .agg(F.sum(F.length("v")).cast("long")
-                       .alias("dict_store")))
-        else:
-            st = c.agg(
-                F.count("*").cast("long").alias("n"),
-                F.countDistinct("v").cast("long").alias("ndv"),
-                (F.count("*") * 8).cast("long").alias("plain_bytes"),
-                F.lit(8).cast("long").alias("width"),
-            )
-            ds = c.agg((F.countDistinct("v") * 8).cast("long")
-                       .alias("dict_store"))
-        b = c.selectExpr("doc_id + 1 AS nid", "v AS pv")
-        runs = (
-            c.join(b, c["doc_id"] == b["nid"])
-            .agg((1 + F.sum(F.when(F.col("v") != F.col("pv"), 1)
-                            .otherwise(0))).cast("long").alias("runs"))
-        )
-        outs.append(
-            st.crossJoin(ds).crossJoin(runs)
-            .select(F.lit(name).alias("col_name"), "n", "ndv", "runs",
-                    "plain_bytes", "dict_store", "width")
-        )
-    p = outs[0]
-    for o in outs[1:]:
-        p = p.unionAll(o)
-    e = p.selectExpr(
-        "col_name", "n", "ndv", "runs", "plain_bytes",
-        "CAST(dict_store + (n * (CASE WHEN ndv = 1 THEN 0 "
-        "ELSE length(bin(ndv - 1)) END) + 7) div 8 AS BIGINT) "
-        "AS dict_bytes",
-        "CAST(runs * (width + 4) AS BIGINT) AS rle_bytes",
-    )
-    return e.selectExpr(
-        "col_name", "n", "ndv", "runs", "plain_bytes", "dict_bytes",
-        "rle_bytes",
-        "CASE WHEN plain_bytes <= dict_bytes AND plain_bytes <= rle_bytes "
-        "THEN 'plain' WHEN dict_bytes <= rle_bytes THEN 'dict' "
-        "ELSE 'rle' END AS best_encoding",
-    )
-
-
-# --- Kendall tau-b rank agreement (q395) --------------------------------------------
-
-
-@query(
-    "q395_kendall_tau",
-    """WITH h AS (SELECT doc_id % 40 AS host,
-                         CAST(count(*) AS BIGINT) AS x,
-                         CAST(max(n_chars) AS BIGINT) AS y
-              FROM documents GROUP BY doc_id % 40),
-       p AS (SELECT a.host AS ha, b.host AS hb,
-                    a.x - b.x AS dx, a.y - b.y AS dy
-             FROM h a JOIN h b ON a.host < b.host),
-       c AS (SELECT
-               CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(sum(CASE WHEN dx * dy > 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS concordant,
-               CAST(sum(CASE WHEN dx * dy < 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS discordant,
-               CAST(sum(CASE WHEN dx = 0 AND dy <> 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS ties_x,
-               CAST(sum(CASE WHEN dy = 0 AND dx <> 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS ties_y,
-               CAST(sum(CASE WHEN dx = 0 AND dy = 0 THEN 1 ELSE 0 END)
-                 AS BIGINT) AS ties_xy
-             FROM p)
-       SELECT n_pairs, concordant, discordant, ties_x, ties_y, ties_xy,
-              CAST(concordant - discordant AS DOUBLE)
-                / (sqrt(CAST(n_pairs - ties_x - ties_xy AS DOUBLE))
-                   * sqrt(CAST(n_pairs - ties_y - ties_xy AS DOUBLE)))
-                AS tau_b
-       FROM c""",
-)
-def q395(spark, sf_dir):
-    """Kendall tau-b rank agreement between two host-level metrics
-    (doc count vs max doc length) — the tie-corrected ordinal
-    companion to q326's Spearman (Kendall's pair counting is the
-    robustness-preferred statistic when ranks carry ties): all five
-    pair classes (concordant / discordant / x-tie / y-tie / both-tie)
-    come from ONE self-join over the LEXICON-BOUNDED host table —
-    C(40,2) = 780 pairs at any corpus size, the df-cap linearity rule
-    — partitioning n_pairs exactly.  tau_b =
-    (C - D) / (sqrt(n0 - Tx - Txy) * sqrt(n0 - Ty - Txy)) is two
-    correctly-rounded IEEE sqrts over exact BIGINTs and one division,
-    the same expression tree on both engines (the q355 sqrt
-    contract).  Host rollup is one map-side-combinable groupBy."""
-    docs = _t(spark, sf_dir, "documents")
-    h = docs.groupBy((F.col("doc_id") % 40).alias("host")).agg(
-        F.count("*").cast("long").alias("x"),
-        F.max("n_chars").cast("long").alias("y"),
-    )
-    b = h.select(F.col("host").alias("hb"), F.col("x").alias("xb"),
-                 F.col("y").alias("yb"))
-    p = h.join(F.broadcast(b), F.col("host") < F.col("hb")).select(
-        (F.col("x") - F.col("xb")).alias("dx"),
-        (F.col("y") - F.col("yb")).alias("dy"),
-    )
-    c = p.agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.sum(F.when(F.col("dx") * F.col("dy") > 0, 1).otherwise(0))
-        .cast("long").alias("concordant"),
-        F.sum(F.when(F.col("dx") * F.col("dy") < 0, 1).otherwise(0))
-        .cast("long").alias("discordant"),
-        F.sum(F.when((F.col("dx") == 0) & (F.col("dy") != 0), 1)
-              .otherwise(0)).cast("long").alias("ties_x"),
-        F.sum(F.when((F.col("dy") == 0) & (F.col("dx") != 0), 1)
-              .otherwise(0)).cast("long").alias("ties_y"),
-        F.sum(F.when((F.col("dx") == 0) & (F.col("dy") == 0), 1)
-              .otherwise(0)).cast("long").alias("ties_xy"),
-    )
-    return c.select(
-        "n_pairs", "concordant", "discordant", "ties_x", "ties_y",
-        "ties_xy",
-        ((F.col("concordant") - F.col("discordant")).cast("double")
-         / (F.sqrt((F.col("n_pairs") - F.col("ties_x")
-                    - F.col("ties_xy")).cast("double"))
-            * F.sqrt((F.col("n_pairs") - F.col("ties_y")
-                      - F.col("ties_xy")).cast("double"))))
-        .alias("tau_b"),
-    )
-
-
-# --- content-addressable store accounting (q396) ------------------------------------
-
-
-@query(
-    "q396_cas_storage",
-    """WITH b AS (SELECT doc_id, source,
-                     unnest(list_filter(list_transform(range(1, 41),
-                       i -> CASE WHEN i = 1 AND length(text) > 1280
-                            THEN error('q396: fixture outgrew 40 blocks')
-                            ELSE substr(text, CAST((i-1)*32+1 AS INT), 32)
-                            END),
-                       s -> length(s) > 0)) AS blk
-              FROM documents),
-       st AS (SELECT blk, CAST(count(*) AS BIGINT) AS refs,
-                     CAST(length(blk) AS BIGINT) AS bytes,
-                     CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0
-                              END) AS BIGINT) AS src0_refs
-             FROM b GROUP BY blk)
-       SELECT CAST(sum(refs) AS BIGINT) AS total_refs,
-              CAST(count(*) AS BIGINT) AS unique_blocks,
-              CAST(sum(refs * bytes) AS BIGINT) AS logical_bytes,
-              CAST(sum(bytes) AS BIGINT) AS physical_bytes,
-              CAST(sum(refs * bytes) AS DOUBLE)
-                / CAST(sum(bytes) AS DOUBLE) AS dedup_ratio,
-              CAST(sum(CASE WHEN refs = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                AS refs_1,
-              CAST(sum(CASE WHEN refs BETWEEN 2 AND 3 THEN 1 ELSE 0
-                       END) AS BIGINT) AS refs_2_3,
-              CAST(sum(CASE WHEN refs BETWEEN 4 AND 7 THEN 1 ELSE 0
-                       END) AS BIGINT) AS refs_4_7,
-              CAST(sum(CASE WHEN refs >= 8 THEN 1 ELSE 0 END) AS BIGINT)
-                AS refs_8p,
-              CAST(sum(CASE WHEN refs = src0_refs THEN bytes ELSE 0
-                       END) AS BIGINT) AS src0_exclusive_bytes
-       FROM st""",
-)
-def q396(spark, sf_dir):
-    """Content-addressable block-store accounting — the dedup-storage
-    dashboard (restic/borg/VAST-style CAS: store each 32-char block
-    once, reference-count it): logical vs physical bytes and the
-    dedup ratio (one IEEE division of exact sums), the refcount
-    histogram in log-2 bins (sizing the hot-block cache), and the
-    GC-planning number — bytes freed if source 'src0' is deleted =
-    blocks ALL of whose references come from src0 (refs == src0_refs;
-    a block shared with any other source is pinned).  Block
-    enumeration shares q391's fixed range(1,41) + loud error()
-    outgrowth guard; the store is ONE (block)-keyed combinable
-    groupBy carrying (refs, src0_refs) so exclusivity needs no second
-    pass, then a single rollup — two linear aggregations at any
-    corpus size."""
-    docs = _t(spark, sf_dir, "documents")
-    blk = ("filter(transform(sequence(1, 40), i -> CASE WHEN i = 1 "
-           "AND length(text) > 1280 THEN "
-           "raise_error('q396: fixture outgrew 40 blocks') "
-           "ELSE substring(text, CAST((i-1)*32+1 AS INT), 32) END), "
-           "s -> length(s) > 0)")
-    b = docs.select(
-        "source", F.explode(F.expr(blk)).alias("blk"))
-    st = b.groupBy("blk").agg(
-        F.count("*").cast("long").alias("refs"),
-        F.sum(F.when(F.col("source") == "src0", 1).otherwise(0))
-        .cast("long").alias("src0_refs"),
-    ).withColumn("bytes", F.length("blk").cast("long"))
-    return st.agg(
-        F.sum("refs").cast("long").alias("total_refs"),
-        F.count("*").cast("long").alias("unique_blocks"),
-        F.sum(F.col("refs") * F.col("bytes")).cast("long")
-        .alias("logical_bytes"),
-        F.sum("bytes").cast("long").alias("physical_bytes"),
-        (F.sum(F.col("refs") * F.col("bytes")).cast("double")
-         / F.sum("bytes").cast("double")).alias("dedup_ratio"),
-        F.sum(F.when(F.col("refs") == 1, 1).otherwise(0)).cast("long")
-        .alias("refs_1"),
-        F.sum(F.when((F.col("refs") >= 2) & (F.col("refs") <= 3), 1)
-              .otherwise(0)).cast("long").alias("refs_2_3"),
-        F.sum(F.when((F.col("refs") >= 4) & (F.col("refs") <= 7), 1)
-              .otherwise(0)).cast("long").alias("refs_4_7"),
-        F.sum(F.when(F.col("refs") >= 8, 1).otherwise(0)).cast("long")
-        .alias("refs_8p"),
-        F.sum(F.when(F.col("refs") == F.col("src0_refs"),
-                     F.col("bytes")).otherwise(0)).cast("long")
-        .alias("src0_exclusive_bytes"),
-    )
-
-
-# --- deletion-cascade closure audit (q397) ------------------------------------------
-
-
-@query(
-    "q397_deletion_cascade",
-    """WITH delc AS (SELECT c_custkey FROM customer
-                     WHERE c_custkey % 50 = 7),
-       delo AS (SELECT o_orderkey FROM orders
-                WHERE o_custkey IN (SELECT c_custkey FROM delc)),
-       dell AS (SELECT l_orderkey, l_linenumber FROM lineitem
-                WHERE l_orderkey IN (SELECT o_orderkey FROM delo)),
-       res AS (SELECT count(*) AS residual FROM lineitem l
-               WHERE l.l_orderkey IN (SELECT o_orderkey FROM delo)
-                 AND NOT EXISTS (SELECT 1 FROM dell d
-                                 WHERE d.l_orderkey = l.l_orderkey
-                                   AND d.l_linenumber = l.l_linenumber))
-       SELECT
-         (SELECT CAST(count(*) AS BIGINT) FROM customer) AS n_customers,
-         (SELECT CAST(count(*) AS BIGINT) FROM delc) AS del_customers,
-         (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_orders,
-         (SELECT CAST(count(*) AS BIGINT) FROM delo) AS del_orders,
-         (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS n_lineitems,
-         (SELECT CAST(count(*) AS BIGINT) FROM dell) AS del_lineitems,
-         (SELECT CAST(residual AS BIGINT) FROM res) AS residual_orphans""",
-)
-def q397(spark, sf_dir):
-    """Right-to-be-forgotten deletion-cascade planning — the GDPR
-    erasure closure over a real FK chain (customer -> orders ->
-    lineitem): the delete set (c_custkey % 50 = 7) closes transitively
-    via two SEMI-joins (never a row-multiplying inner join — the
-    closure is a membership question), emitting per-table tombstone
-    counts plus the residual-orphan PROOF column: rows whose parent
-    is in the closure but which the closure missed — exactly 0 when
-    the cascade is complete, and the first nonzero the moment a
-    table is added to the schema without extending the cascade (the
-    audit real erasure pipelines run before committing tombstones).
-    Shape: two broadcastable key sets driving left-semi joins, one
-    scalar rollup; linear in each table, no shuffle wider than the
-    delete-set keys."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    delc = cust.filter(F.col("c_custkey") % 50 == 7).select("c_custkey")
-    delo = orders.join(
-        F.broadcast(delc), orders["o_custkey"] == delc["c_custkey"],
-        "left_semi").select("o_orderkey")
-    dell = li.join(F.broadcast(delo), li["l_orderkey"] == delo["o_orderkey"],
-                   "left_semi").select("l_orderkey", "l_linenumber")
-    residual = (
-        li.join(F.broadcast(delo),
-                li["l_orderkey"] == delo["o_orderkey"], "left_semi")
-        .join(dell, ["l_orderkey", "l_linenumber"], "left_anti")
-        .agg(F.count("*").cast("long").alias("residual_orphans"))
-    )
-    return (
-        cust.agg(F.count("*").cast("long").alias("n_customers"))
-        .crossJoin(delc.agg(F.count("*").cast("long")
-                            .alias("del_customers")))
-        .crossJoin(orders.agg(F.count("*").cast("long").alias("n_orders")))
-        .crossJoin(delo.agg(F.count("*").cast("long").alias("del_orders")))
-        .crossJoin(li.agg(F.count("*").cast("long").alias("n_lineitems")))
-        .crossJoin(dell.agg(F.count("*").cast("long")
-                            .alias("del_lineitems")))
-        .crossJoin(residual)
-    )
-
-
-# --- equi-depth histogram stats (q398) ----------------------------------------------
-
-
-@query(
-    "q398_equidepth_histogram",
-    """WITH vh AS (SELECT n_chars AS v, CAST(count(*) AS BIGINT) AS cnt
-              FROM documents GROUP BY n_chars),
-       cu AS (SELECT v, cnt,
-                     CAST(sum(cnt) OVER (ORDER BY v
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW) AS BIGINT) AS cum
-              FROM vh),
-       tt AS (SELECT CAST(sum(cnt) AS BIGINT) AS n,
-                     CAST(min(v) AS BIGINT) AS vmin FROM vh),
-       bk AS (SELECT k.k AS bucket, min(cu.v) AS hi
-              FROM range(1, 9) k(k), cu, tt
-              WHERE 8 * cu.cum >= k.k * tt.n
-              GROUP BY k.k),
-       bl AS (SELECT b.bucket, b.hi,
-                     coalesce((SELECT max(p.hi) FROM bk p
-                               WHERE p.bucket < b.bucket),
-                              (SELECT vmin - 1 FROM tt)) AS lo
-              FROM bk b),
-       br AS (SELECT bl.bucket, bl.lo, bl.hi,
-                     CAST(coalesce(sum(vh.cnt), 0) AS BIGINT)
-                       AS bucket_rows
-              FROM bl LEFT JOIN vh
-                ON vh.v > bl.lo AND vh.v <= bl.hi
-              GROUP BY bl.bucket, bl.lo, bl.hi),
-       pt AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS probe_true
-              FROM vh WHERE v BETWEEN 100 AND 300),
-       pe AS (SELECT CAST(coalesce(sum(bucket_rows), 0) AS BIGINT)
-                       AS probe_est
-              FROM br WHERE hi >= 100 AND lo < 300)
-       SELECT CAST(br.bucket AS BIGINT) AS bucket,
-              CAST(br.lo AS BIGINT) AS lo, CAST(br.hi AS BIGINT) AS hi,
-              br.bucket_rows, pe.probe_est, pt.probe_true
-       FROM br, pe, pt""",
-)
-def q398(spark, sf_dir):
-    """Equi-depth histogram construction + selectivity-estimate audit
-    — the optimizer statistic feeding q390's planner (equi-depth
-    bounds per-bucket error where equi-width drowns in skew):
-    boundary b_k = min value with 8*cum >= k*n (the q374 exact
-    nearest-rank cross-multiplication over the BOUNDED value
-    histogram — the cumulative window runs over <= |domain| rows,
-    never the corpus), buckets are the (b_{k-1}, b_k] ranges, and the
-    audit row evaluates a probe predicate [100, 300] two ways: the
-    histogram estimate (sum of intersecting buckets — the
-    no-interpolation form, provably an OVER-estimate) vs the exact
-    count, the error a DBA reads before trusting the plan.  All
-    integers; heavy duplicates make realized depths unequal — that is
-    the true histogram behavior, not a bug.  One corpus pass to the
-    value histogram; everything after is domain-bounded."""
-    docs = _t(spark, sf_dir, "documents")
-    vh = docs.groupBy(F.col("n_chars").alias("v")).agg(
-        F.count("*").cast("long").alias("cnt"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding,
-                                        Window.currentRow)
-    cu = vh.select("v", "cnt", F.sum("cnt").over(w).cast("long")
-                   .alias("cum"))
-    tt = vh.agg(F.sum("cnt").cast("long").alias("n"),
-                F.min("v").cast("long").alias("vmin"))
-    ks = spark.createDataFrame([(k,) for k in range(1, 9)], "k LONG")
-    bk = (
-        F.broadcast(ks).crossJoin(F.broadcast(tt)).crossJoin(cu)
-        .filter(8 * F.col("cum") >= F.col("k") * F.col("n"))
-        .groupBy(F.col("k").alias("bucket"))
-        .agg(F.min("v").alias("hi"))
-    )
-    prev = bk.select(F.col("bucket").alias("pb"), F.col("hi").alias("ph"))
-    bl = (
-        bk.join(F.broadcast(prev), F.col("pb") < F.col("bucket"), "left")
-        .groupBy("bucket", "hi")
-        .agg(F.max("ph").alias("prev_hi"))
-        .crossJoin(F.broadcast(tt.select("vmin")))
-        .select("bucket", "hi",
-                F.coalesce(F.col("prev_hi"), F.col("vmin") - 1).alias("lo"))
-    )
-    br = (
-        F.broadcast(bl).join(
-            vh, (vh["v"] > F.col("lo")) & (vh["v"] <= F.col("hi")), "left")
-        .groupBy("bucket", "lo", "hi")
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).cast("long")
-             .alias("bucket_rows"))
-    )
-    pt = vh.filter((F.col("v") >= 100) & (F.col("v") <= 300)).agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).cast("long")
-        .alias("probe_true"))
-    pe = br.filter((F.col("hi") >= 100) & (F.col("lo") < 300)).agg(
-        F.coalesce(F.sum("bucket_rows"), F.lit(0)).cast("long")
-        .alias("probe_est"))
-    return (
-        br.crossJoin(F.broadcast(pe)).crossJoin(F.broadcast(pt))
-        .select(F.col("bucket").cast("long").alias("bucket"),
-                F.col("lo").cast("long").alias("lo"),
-                F.col("hi").cast("long").alias("hi"),
-                "bucket_rows", "probe_est", "probe_true")
-    )
-
-
-# --- Pareto skyline frontier (q399) -------------------------------------------------
-
-
-@query(
-    "q399_pareto_frontier",
-    """WITH d AS (SELECT n_chars AS len,
-                ((doc_id * 48271) % 500)
-                  + (600 - n_chars) // 2 AS quality
-              FROM documents),
-       m AS (SELECT len, CAST(max(quality) AS BIGINT) AS best_q,
-                    CAST(count(*) AS BIGINT) AS n_at_len
-             FROM d GROUP BY len),
-       c AS (SELECT len, best_q,
-                    coalesce(max(best_q) OVER (ORDER BY len
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING), -1000000) AS prefix_best
-             FROM m),
-       f AS (SELECT c.len, c.best_q FROM c WHERE c.best_q > c.prefix_best)
-       SELECT CAST(f.len AS BIGINT) AS len, f.best_q,
-              CAST((SELECT count(*) FROM d
-                    WHERE d.len = f.len AND d.quality = f.best_q)
-                AS BIGINT) AS n_docs
-       FROM f""",
-)
-def q399(spark, sf_dir):
-    """Pareto-skyline frontier for multi-objective curation (minimize
-    length cost, maximize quality — the tradeoff set a data-mixing
-    run picks from): a point is on the skyline iff no shorter-or-
-    equal doc has better-or-equal quality with one strict, which over
-    an INTEGER length domain reduces to per-length best quality
-    (one map-side-combinable groupBy, output bounded by the length
-    DOMAIN, never the corpus) followed by a strict prefix-max sweep
-    (one cumulative window over <= |domain| rows — the q374 bounded-
-    histogram plan, where the naive skyline is an O(n^2) dominance
-    anti-join).  Quality mixes a hash term with an anti-correlated
-    length term so the frontier is thick (many incomparable points)
-    rather than a single corner.  Emits each frontier point with its
-    doc multiplicity; frontier quality is strictly increasing in
-    length BY CONSTRUCTION of the strict sweep — pinned, along with a
-    pure-Python dominance replay."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select(
-        F.col("n_chars").alias("len"),
-        (((F.col("doc_id") * 48271) % 500)
-         + F.expr("(600 - n_chars) div 2")).alias("quality"),
-    )
-    m = d.groupBy("len").agg(F.max("quality").cast("long").alias("best_q"))
-    w = (Window.orderBy("len")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    c = m.select(
-        "len", "best_q",
-        F.coalesce(F.max("best_q").over(w), F.lit(-1000000))
-        .alias("prefix_best"),
-    )
-    f = c.filter(F.col("best_q") > F.col("prefix_best")).select(
-        "len", "best_q")
-    return (
-        F.broadcast(f).join(
-            d, (d["len"] == f["len"]) & (d["quality"] == f["best_q"]))
-        .groupBy(f["len"].cast("long").alias("len"), "best_q")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-    )
-
-
-# --- release-readiness scorecard (q400) ---------------------------------------------
-
-
-@query(
-    "q400_release_scorecard",
-    """WITH d AS (SELECT source, lang, n_chars, doc_id, md5(text) AS h
-              FROM documents),
-       per AS (SELECT source,
-                 CAST(count(*) AS BIGINT) AS total,
-                 CAST(count(*) - count(DISTINCT h) AS BIGINT) AS dups,
-                 CAST(sum(CASE WHEN n_chars < 100 THEN 1 ELSE 0 END)
-                   AS BIGINT) AS short_docs,
-                 CAST(sum(CASE WHEN doc_id % 97 = 13 THEN 1 ELSE 0 END)
-                   AS BIGINT) AS flagged
-               FROM d GROUP BY source),
-       lc AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS c
-              FROM d GROUP BY source, lang),
-       hh AS (SELECT source, CAST(sum(c*c) AS BIGINT) AS lang_sq_sum
-              FROM lc GROUP BY source),
-       g AS (SELECT per.source, per.total, per.dups, per.short_docs,
-                    per.flagged, hh.lang_sq_sum,
-                    CASE WHEN 5 * per.dups <= per.total
-                         THEN 1 ELSE 0 END AS gate_dup,
-                    CASE WHEN 20 * per.short_docs <= 3 * per.total
-                         THEN 1 ELSE 0 END AS gate_length,
-                    CASE WHEN 10 * hh.lang_sq_sum
-                              <= 3 * per.total * per.total
-                         THEN 1 ELSE 0 END AS gate_diversity,
-                    CASE WHEN per.flagged = 0 THEN 1 ELSE 0 END
-                      AS gate_license
-             FROM per JOIN hh USING (source))
-       SELECT source, total, dups, short_docs, flagged, lang_sq_sum,
-              CAST(gate_dup AS BIGINT) AS gate_dup,
-              CAST(gate_length AS BIGINT) AS gate_length,
-              CAST(gate_diversity AS BIGINT) AS gate_diversity,
-              CAST(gate_license AS BIGINT) AS gate_license,
-              CAST(gate_dup * gate_length * gate_diversity
-                   * gate_license AS BIGINT) AS release_ok
-       FROM g""",
-)
-def q400(spark, sf_dir):
-    """Release-readiness scorecard — the per-source go/no-go dashboard
-    a corpus release runs LAST, composing this round's governance
-    themes into one plan with shared scans: exact-dup rate <= 20%
-    (5*dups <= total), short-doc rate <= 15% (20*short <= 3*total),
-    language concentration HHI <= 0.3 decided WITHOUT division as
-    10*sum(c^2) <= 3*total^2 (the q377 diversity statistic as an
-    exact integer gate), and a zero-tolerance license gate on the
-    q388 flagged class (doc_id % 97 = 13).  Every gate is an integer
-    cross-multiplication; release_ok is their product, so one failing
-    gate pins the exact reason in the same row — no rerun to
-    diagnose.  Shape: one doc scan feeding two map-side-combinable
-    groupBys (per-source stats + the lexicon-bounded (source, lang)
-    histogram), one bounded join; gate thresholds calibrated so both
-    outcomes occur at every SF."""
-    docs = _t(spark, sf_dir, "documents")
-    d = docs.select("source", "lang", "n_chars", "doc_id",
-                    F.md5("text").alias("h"))
-    per = d.groupBy("source").agg(
-        F.count("*").cast("long").alias("total"),
-        (F.count("*") - F.countDistinct("h")).cast("long").alias("dups"),
-        F.sum(F.when(F.col("n_chars") < 100, 1).otherwise(0)).cast("long")
-        .alias("short_docs"),
-        F.sum(F.when(F.col("doc_id") % 97 == 13, 1).otherwise(0))
-        .cast("long").alias("flagged"),
-    )
-    lc = d.groupBy("source", "lang").agg(F.count("*").cast("long")
-                                         .alias("c"))
-    hh = lc.groupBy("source").agg(
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("lang_sq_sum"))
-    g = per.join(hh, "source").select(
-        "source", "total", "dups", "short_docs", "flagged", "lang_sq_sum",
-        F.when(5 * F.col("dups") <= F.col("total"), 1).otherwise(0)
-        .cast("long").alias("gate_dup"),
-        F.when(20 * F.col("short_docs") <= 3 * F.col("total"), 1)
-        .otherwise(0).cast("long").alias("gate_length"),
-        F.when(10 * F.col("lang_sq_sum")
-               <= 3 * F.col("total") * F.col("total"), 1).otherwise(0)
-        .cast("long").alias("gate_diversity"),
-        F.when(F.col("flagged") == 0, 1).otherwise(0).cast("long")
-        .alias("gate_license"),
-    )
-    return g.withColumn(
-        "release_ok",
-        (F.col("gate_dup") * F.col("gate_length") * F.col("gate_diversity")
-         * F.col("gate_license")).cast("long"),
-    )
-
-
-# --- hexagonal binning (q401) -------------------------------------------------------
-
-
-@query(
-    "q401_hex_binning",
-    f"""WITH pts AS ({POINTS_SQL}),
-       ax AS (SELECT lon * 0.11547005383792515
-                       - lat * 0.06666666666666667 AS qf,
-                     lat * 0.13333333333333333 AS rf
-              FROM pts),
-       cz AS (SELECT qf, rf, -qf - rf AS zf FROM ax),
-       rd AS (SELECT qf, rf, zf,
-                     CAST(floor(qf + 0.5) AS BIGINT) AS rx,
-                     CAST(floor(rf + 0.5) AS BIGINT) AS ry,
-                     CAST(floor(zf + 0.5) AS BIGINT) AS rz
-              FROM cz),
-       dd AS (SELECT rx, ry, rz,
-                     abs(rx - qf) AS dx, abs(ry - rf) AS dy,
-                     abs(rz - zf) AS dz
-              FROM rd),
-       fx AS (SELECT CASE WHEN dx > dy AND dx > dz THEN -ry - rz
-                          ELSE rx END AS hq,
-                     CASE WHEN NOT (dx > dy AND dx > dz) AND dy > dz
-                          THEN -rx - rz ELSE ry END AS hr
-              FROM dd)
-       SELECT CAST(hq AS BIGINT) AS hq, CAST(hr AS BIGINT) AS hr,
-              CAST(count(*) AS BIGINT) AS n_points,
-              CAST((abs(hq) + abs(hr) + abs(hq + hr)) // 2 AS BIGINT)
-                AS hex_dist
-       FROM fx GROUP BY hq, hr""",
-)
-def q401(spark, sf_dir):
-    """TRUE hexagonal binning (H3's cell geometry, not the square
-    stand-in in kernels/cells.py): pointy-top axial coordinates
-    qf = x*sqrt(3)/15 - y/15, rf = y*2/15 (size-5 hexes; the
-    Python-computed constants are inlined VERBATIM on both sides per
-    the q73/q85 rule) followed by the standard cube rounding — round
-    all three cube coords with the exact floor(v + 0.5) (HALF-UP on
-    both engines, never round() whose tie rule differs), then repair
-    the one with the largest error so hq + hr + hs = 0 exactly; the
-    repair CASE is shared verbatim so both engines fix the same
-    coordinate on identical IEEE doubles.  Hexagons give uniform
-    6-neighbor adjacency (no square diagonal ambiguity) — the reason
-    H3 is hex — and hex_dist = (|q|+|r|+|q+r|)/2 is the exact ring
-    distance.  One corpus pass, one grid-bounded groupBy; pinned by a
-    pure-Python float replay of the full rounding pipeline."""
-    pts = _points(spark, sf_dir)
-    ax = pts.select(
-        (F.col("lon") * 0.11547005383792515
-         - F.col("lat") * 0.06666666666666667).alias("qf"),
-        (F.col("lat") * 0.13333333333333333).alias("rf"),
-    )
-    cz = ax.select("qf", "rf", (-F.col("qf") - F.col("rf")).alias("zf"))
-    rd = cz.select(
-        "qf", "rf", "zf",
-        F.floor(F.col("qf") + 0.5).cast("long").alias("rx"),
-        F.floor(F.col("rf") + 0.5).cast("long").alias("ry"),
-        F.floor(F.col("zf") + 0.5).cast("long").alias("rz"),
-    )
-    dd = rd.select(
-        "rx", "ry", "rz",
-        F.abs(F.col("rx") - F.col("qf")).alias("dx"),
-        F.abs(F.col("ry") - F.col("rf")).alias("dy"),
-        F.abs(F.col("rz") - F.col("zf")).alias("dz"),
-    )
-    big_x = (F.col("dx") > F.col("dy")) & (F.col("dx") > F.col("dz"))
-    fx = dd.select(
-        F.when(big_x, -F.col("ry") - F.col("rz")).otherwise(F.col("rx"))
-        .alias("hq"),
-        F.when(~big_x & (F.col("dy") > F.col("dz")),
-               -F.col("rx") - F.col("rz")).otherwise(F.col("ry"))
-        .alias("hr"),
-    )
-    return fx.groupBy(
-        F.col("hq").cast("long").alias("hq"),
-        F.col("hr").cast("long").alias("hr"),
-    ).agg(F.count("*").cast("long").alias("n_points")).select(
-        "hq", "hr", "n_points",
-        F.expr("CAST((abs(hq) + abs(hr) + abs(hq + hr)) div 2 AS BIGINT)")
-        .alias("hex_dist"),
-    )
-
-
-# --- geohash encode/decode (q402) ---------------------------------------------------
-
-_GH_AL = "0123456789bcdefghjkmnpqrstuvwxyz"
-
-
-def _gh_exprs(divop: str) -> dict:
-    """Shared geohash bit arithmetic; divop = '//' (DuckDB) or 'div'."""
-    inter = " + ".join(
-        f"(((gx {divop} {1 << j}) % 2) * {1 << (2 * j + 1)})"
-        f" + (((gy {divop} {1 << j}) % 2) * {1 << (2 * j)})"
-        for j in range(15)
-    )
-    chars = " || ".join(
-        f"substr('{_GH_AL}', CAST((m {divop} {1 << (25 - 5 * i)}) % 32"
-        f" + 1 AS INT), 1)"
-        for i in range(6)
-    )
-    m2 = " + ".join(
-        f"((instr('{_GH_AL}', substr(gh, {i + 1}, 1)) - 1)"
-        f" * {1 << (25 - 5 * i)})"
-        for i in range(6)
-    )
-    gx2 = " + ".join(
-        f"(((m2 {divop} {1 << (2 * j + 1)}) % 2) * {1 << j})"
-        for j in range(15)
-    )
-    gy2 = " + ".join(
-        f"(((m2 {divop} {1 << (2 * j)}) % 2) * {1 << j})"
-        for j in range(15)
-    )
-    return {"inter": inter, "chars": chars, "m2": m2,
-            "gx2": gx2, "gy2": gy2}
-
-
-def _gh_oracle_sql() -> str:
-    e = _gh_exprs("//")
-    return f"""WITH pts AS ({POINTS_SQL}),
-       g AS (SELECT CAST(floor((lon + 180.0)/360.0 * 32768.0) AS BIGINT)
-                      AS gx,
-                    CAST(floor((lat + 90.0)/180.0 * 32768.0) AS BIGINT)
-                      AS gy
-             FROM pts),
-       mi AS (SELECT gx, gy, {e['inter']} AS m FROM g),
-       gh AS (SELECT gx, gy, {e['chars']} AS gh FROM mi),
-       de AS (SELECT gx, gy, gh, {e['m2']} AS m2 FROM gh),
-       rt AS (SELECT gh, gx, gy, {e['gx2']} AS gx2, {e['gy2']} AS gy2
-              FROM de)
-       SELECT substr(gh, 1, 3) AS prefix,
-              CAST(count(*) AS BIGINT) AS n_points,
-              CAST(count(DISTINCT gh) AS BIGINT) AS n_cells,
-              CAST(sum(CASE WHEN gx2 <> gx OR gy2 <> gy
-                       THEN 1 ELSE 0 END) AS BIGINT) AS rt_fail
-       FROM rt GROUP BY substr(gh, 1, 3)"""
-
-
-@query("q402_geohash_cells", _gh_oracle_sql())
-def q402(spark, sf_dir):
-    """Geohash encode + decode roundtrip — the third public cell
-    system joining the H3-style and S2-style ids (kernels/cells.py)
-    and q401's true hexes: 6-character geohash = 30-bit lon-first bit
-    interleave of the 15-bit lon/lat grids mapped through the
-    standard base32 alphabet, all as pure div/mod integer arithmetic
-    in whole-stage codegen (the engine spells integer division `div`,
-    the oracle `//` — same generator emits both, the q394 lesson);
-    the DECODE path (alphabet instr -> bit de-interleave) runs in the
-    same plan and the per-prefix rt_fail column PROVES encode/decode
-    are inverses on every row — 0 everywhere, and loudly nonzero the
-    moment either path drops a bit.  Output is grouped by 3-char
-    prefix (the cell-prefix containment property that makes geohash a
-    prefix-searchable index); grid-bounded, one corpus pass."""
-    e = _gh_exprs("div")
-    pts = _points(spark, sf_dir)
-    g = pts.selectExpr(
-        "CAST(floor((lon + 180.0)/360.0 * 32768.0) AS BIGINT) AS gx",
-        "CAST(floor((lat + 90.0)/180.0 * 32768.0) AS BIGINT) AS gy",
-    )
-    mi = g.selectExpr("gx", "gy", f"{e['inter']} AS m")
-    gh = mi.selectExpr("gx", "gy", f"{e['chars']} AS gh")
-    de = gh.selectExpr("gx", "gy", "gh", f"{e['m2']} AS m2")
-    rt = de.selectExpr("gh", "gx", "gy", f"{e['gx2']} AS gx2",
-                       f"{e['gy2']} AS gy2")
-    return rt.groupBy(F.substring("gh", 1, 3).alias("prefix")).agg(
-        F.count("*").cast("long").alias("n_points"),
-        F.countDistinct("gh").cast("long").alias("n_cells"),
-        F.sum(F.when((F.col("gx2") != F.col("gx"))
-                     | (F.col("gy2") != F.col("gy")), 1).otherwise(0))
-        .cast("long").alias("rt_fail"),
-    )
-
-
-# --- typosquat domain detection (q403) -----------------------------------------------
-
-
-def _typosquat_host_sql(divop: str) -> str:
-    """Shared host-fixture derivation; divop = '//' (DuckDB) or 'div'."""
-    return f"""SELECT doc_id,
-              CASE WHEN doc_id % 13 = 5 THEN
-                     CASE (doc_id {divop} 325) % 3
-                       WHEN 0 THEN substr(bk, 2)
-                       WHEN 1 THEN bk || 'x'
-                       ELSE substr(bk, 1, 2) || 'z' || substr(bk, 4)
-                     END
-                   WHEN doc_id % 13 = 7 THEN bk
-                   ELSE 'site' || CAST(doc_id % 97 AS VARCHAR) || 'web'
-              END AS host
-       FROM (SELECT doc_id,
-                    'brand' || CAST((doc_id {divop} 13) % 25 AS VARCHAR)
-                            || 'shop' AS bk
-             FROM documents)"""
-
-
-@query(
-    "q403_typosquat_domains",
-    f"""WITH b AS (SELECT 'brand' || CAST(n_nationkey AS VARCHAR)
-                          || 'shop' AS bname FROM nation),
-       h0 AS ({_typosquat_host_sql('//')}),
-       h AS (SELECT host, CAST(count(*) AS BIGINT) AS n_docs
-             FROM h0 GROUP BY host),
-       c AS (SELECT b.bname, h.host, h.n_docs,
-                    levenshtein(h.host, b.bname) AS d
-             FROM h CROSS JOIN b
-             WHERE levenshtein(h.host, b.bname) <= 2)
-       SELECT bname,
-              CAST(sum(CASE WHEN d = 0 THEN n_docs ELSE 0 END)
-                AS BIGINT) AS exact_docs,
-              CAST(sum(CASE WHEN d = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS dist1_hosts,
-              CAST(sum(CASE WHEN d = 2 THEN 1 ELSE 0 END)
-                AS BIGINT) AS dist2_hosts,
-              CAST(sum(CASE WHEN d >= 1 THEN n_docs ELSE 0 END)
-                AS BIGINT) AS squat_docs
-       FROM c GROUP BY bname""",
-)
-def q403(spark, sf_dir):
-    """Typosquat / domain-spoofing detection — the brand-protection
-    screen a web-scale crawl runs against its host column (the
-    phishing analogue of gdal's name-matching utilities; edit
-    distance is built into BOTH engines as `levenshtein`, an exact
-    integer, so the whole query is JVM-side with zero UDFs).  The
-    fixture injects, per doc class, three deterministic damage
-    variants of a 25-brand lexicon (leading-char drop / append /
-    3rd-char substitution — each provably distance 1) plus exact
-    brand hits (distance 0) into a 97-host background that is >2
-    from every brand; variant and brand selectors derive from
-    doc_id div 13 / div 325 so they VARY within the %13 class (the
-    q323/q351 gcd lesson).  Brand-vs-brand digit collisions
-    ('brand5shop' vs 'brand15shop', d=1) are real squat semantics
-    and replay identically.  Scale shape: the corpus collapses to
-    its DISTINCT-host lexicon first (~200 rows, one combinable
-    groupBy carrying doc counts as weights), then a 25-brand
-    broadcast cross join scores |lexicon| x |brands| candidate
-    pairs — bounded by the host lexicon, NEVER corpus x brands."""
-    h0 = _t(spark, sf_dir, "documents").selectExpr(
-        "doc_id",
-        "concat('brand', CAST((doc_id div 13) % 25 AS STRING), 'shop')"
-        " AS bk",
-    ).selectExpr(
-        "CASE WHEN doc_id % 13 = 5 THEN"
-        " CASE (doc_id div 325) % 3"
-        " WHEN 0 THEN substring(bk, 2)"
-        " WHEN 1 THEN concat(bk, 'x')"
-        " ELSE concat(substring(bk, 1, 2), 'z', substring(bk, 4)) END"
-        " WHEN doc_id % 13 = 7 THEN bk"
-        " ELSE concat('site', CAST(doc_id % 97 AS STRING), 'web')"
-        " END AS host"
-    )
-    h = h0.groupBy("host").agg(F.count("*").cast("long").alias("n_docs"))
-    b = _t(spark, sf_dir, "nation").selectExpr(
-        "concat('brand', CAST(n_nationkey AS STRING), 'shop') AS bname")
-    c = h.crossJoin(F.broadcast(b)).withColumn(
-        "d", F.levenshtein(F.col("host"), F.col("bname"))
-    ).filter(F.col("d") <= 2)
-    return c.groupBy("bname").agg(
-        F.sum(F.when(F.col("d") == 0, F.col("n_docs")).otherwise(0))
-        .cast("long").alias("exact_docs"),
-        F.sum(F.when(F.col("d") == 1, 1).otherwise(0))
-        .cast("long").alias("dist1_hosts"),
-        F.sum(F.when(F.col("d") == 2, 1).otherwise(0))
-        .cast("long").alias("dist2_hosts"),
-        F.sum(F.when(F.col("d") >= 1, F.col("n_docs")).otherwise(0))
-        .cast("long").alias("squat_docs"),
-    )
-
-
-# --- quadkey tile addressing (q404) --------------------------------------------------
-
-
-def _qk_exprs(divop: str) -> dict:
-    """Shared quadkey bit arithmetic at z=8; divop = '//' or 'div'."""
-    chars = " || ".join(
-        f"substr('0123', CAST(((ty {divop} {1 << (7 - i)}) % 2) * 2"
-        f" + ((tx {divop} {1 << (7 - i)}) % 2) + 1 AS INT), 1)"
-        for i in range(8)
-    )
-    tx2 = " + ".join(
-        f"(((instr('0123', substr(qk, {i + 1}, 1)) - 1) % 2)"
-        f" * {1 << (7 - i)})"
-        for i in range(8)
-    )
-    ty2 = " + ".join(
-        f"(((instr('0123', substr(qk, {i + 1}, 1)) - 1) {divop} 2)"
-        f" * {1 << (7 - i)})"
-        for i in range(8)
-    )
-    px = " + ".join(
-        f"(((instr('0123', substr(qk, {i + 1}, 1)) - 1) % 2)"
-        f" * {1 << (3 - i)})"
-        for i in range(4)
-    )
-    py = " + ".join(
-        f"(((instr('0123', substr(qk, {i + 1}, 1)) - 1) {divop} 2)"
-        f" * {1 << (3 - i)})"
-        for i in range(4)
-    )
-    return {"chars": chars, "tx2": tx2, "ty2": ty2, "px": px, "py": py}
-
-
-def _qk_oracle_sql() -> str:
-    e = _qk_exprs("//")
-    return f"""WITH pts AS ({POINTS_SQL}),
-       g AS (SELECT CAST(floor((lon + 180.0)/360.0 * 256.0) AS BIGINT)
-                      AS tx,
-                    CAST(floor((90.0 - lat)/180.0 * 256.0) AS BIGINT)
-                      AS ty
-             FROM pts),
-       qk AS (SELECT tx, ty, {e['chars']} AS qk FROM g),
-       de AS (SELECT tx, ty, qk,
-                     {e['tx2']} AS tx2, {e['ty2']} AS ty2,
-                     {e['px']} AS px, {e['py']} AS py
-              FROM qk)
-       SELECT substr(qk, 1, 4) AS parent_qk,
-              CAST(count(*) AS BIGINT) AS n_points,
-              CAST(count(DISTINCT qk) AS BIGINT) AS n_tiles,
-              CAST(sum(CASE WHEN tx2 <> tx OR ty2 <> ty
-                       THEN 1 ELSE 0 END) AS BIGINT) AS rt_fail,
-              CAST(sum(CASE WHEN px <> tx // 16 OR py <> ty // 16
-                       THEN 1 ELSE 0 END) AS BIGINT) AS parent_fail
-       FROM de GROUP BY substr(qk, 1, 4)"""
-
-
-@query("q404_quadkey_tiles", _qk_oracle_sql())
-def q404(spark, sf_dir):
-    """Quadkey tile addressing (the Bing/web-map scheme the tile
-    pyramid sinks of q15/q213 serve): z=8 tile coordinates map to an
-    8-digit base-4 string where digit i interleaves bit 7-i of
-    (ty, tx) — pure div/mod integer arithmetic in whole-stage
-    codegen, one generator emitting both engines' division spellings
-    (the q394 lesson).  The same plan DECODES the key back
-    (alphabet instr -> bit de-interleave) and rt_fail PROVES
-    encode/decode are inverses on every row; parent_fail decodes the
-    4-char PREFIX at z=4 and proves it equals (tx div 16, ty div 16)
-    — the zoom-hierarchy containment property (a quadkey's prefix IS
-    its ancestor tile) that makes quadkeys a prefix-searchable tile
-    index and lets a pyramid store all zooms in one sorted column.
-    Grid-bounded, one corpus pass, grouped by the z=4 parent."""
-    e = _qk_exprs("div")
-    pts = _points(spark, sf_dir)
-    g = pts.selectExpr(
-        "CAST(floor((lon + 180.0)/360.0 * 256.0) AS BIGINT) AS tx",
-        "CAST(floor((90.0 - lat)/180.0 * 256.0) AS BIGINT) AS ty",
-    )
-    qk = g.selectExpr("tx", "ty", f"{e['chars']} AS qk")
-    de = qk.selectExpr(
-        "tx", "ty", "qk",
-        f"{e['tx2']} AS tx2", f"{e['ty2']} AS ty2",
-        f"{e['px']} AS px", f"{e['py']} AS py",
-    )
-    return de.groupBy(F.substring("qk", 1, 4).alias("parent_qk")).agg(
-        F.count("*").cast("long").alias("n_points"),
-        F.countDistinct("qk").cast("long").alias("n_tiles"),
-        F.sum(F.when((F.col("tx2") != F.col("tx"))
-                     | (F.col("ty2") != F.col("ty")), 1).otherwise(0))
-        .cast("long").alias("rt_fail"),
-        F.sum(F.when((F.col("px") != F.expr("tx div 16"))
-                     | (F.col("py") != F.expr("ty div 16")), 1)
-              .otherwise(0))
-        .cast("long").alias("parent_fail"),
-    )
-
-
-# --- differentially-private release, geometric mechanism (q405) ----------------------
-
-
-def _trailing_ones_case(col: str) -> str:
-    """Trailing-ones count of a 16-bit field — t iff b mod 2^(t+1) ==
-    2^t - 1; a 17-branch integer CASE identical in both engines."""
-    br = " ".join(
-        f"WHEN {col} % {1 << (t + 1)} = {(1 << t) - 1} THEN {t}"
-        for t in range(16)
-    )
-    return f"CASE {br} ELSE 16 END"
-
-
-def _dp_sql(engine: str) -> str:
-    """q405 body; engine = 'spark' | 'duck' (md5-hex parse + div)."""
-    if engine == "spark":
-        u32 = ("CAST(conv(substr(md5(concat(lang, '|', source)), 1, 8),"
-               " 16, 10) AS BIGINT)")
-        dv = "div"
-    else:
-        u32 = ("CAST(CAST('0x' || substr(md5(concat(lang, '|', source)),"
-               " 1, 8) AS UBIGINT) AS BIGINT)")
-        dv = "//"
-    t1 = _trailing_ones_case("(u % 65536)")
-    t2 = _trailing_ones_case(f"((u {dv} 65536) % 65536)")
-    return f"""WITH g AS (SELECT lang, source,
-                    CAST(count(*) AS BIGINT) AS n_true
-             FROM documents GROUP BY lang, source),
-       h AS (SELECT lang, source, n_true, {u32} AS u FROM g),
-       z AS (SELECT lang, source, n_true,
-                    CAST({t1} - {t2} AS BIGINT) AS noise
-             FROM h)
-       SELECT lang, source, n_true, noise,
-              CAST(n_true + noise AS BIGINT) AS released,
-              CAST(CASE WHEN n_true + noise >= 3 THEN 1 ELSE 0 END
-                AS BIGINT) AS published
-       FROM z"""
-
-
-@query("q405_dp_geometric_release", _dp_sql("duck"))
-def q405(spark, sf_dir):
-    """Differentially-private count release via the GEOMETRIC
-    mechanism (discrete Laplace, alpha=1/2, epsilon = ln 2 per unit
-    sensitivity) — the governance op that publishes per-(lang,
-    source) corpus statistics without revealing any single document:
-    noise = T1 - T2 where each Ti is the TRAILING-ONES count of a
-    disjoint 16-bit field of the group key's md5 (P(T=t) = 2^-(t+1)
-    exactly — geometric(1/2) from raw hash bits; the difference of
-    two iid geometrics IS the discrete-Laplace distribution, a real
-    DP mechanism sampled with ZERO transcendentals).  Trailing-ones
-    is a 17-branch integer CASE (b mod 2^(t+1) == 2^t - 1) identical
-    in both engines; the md5-hex parse uses the established conv /
-    UBIGITN split per engine; |noise| <= 16 by construction.
-    Noisy-threshold suppression (publish iff released >= 3) operates
-    on the RELEASED value, the correct DP ordering.  Shape: one
-    map-side-combinable groupBy to the bounded release table, noise a
-    pure Column over the group key — deterministic, auditable,
-    linear."""
-    u32 = ("CAST(conv(substr(md5(concat(lang, '|', source)), 1, 8),"
-           " 16, 10) AS BIGINT)")
-    t1 = _trailing_ones_case("(u % 65536)")
-    t2 = _trailing_ones_case("((u div 65536) % 65536)")
-    g = _t(spark, sf_dir, "documents").groupBy("lang", "source").agg(
-        F.count("*").cast("long").alias("n_true"))
-    h = g.selectExpr("lang", "source", "n_true", f"{u32} AS u")
-    z = h.selectExpr("lang", "source", "n_true",
-                     f"CAST({t1} - {t2} AS BIGINT) AS noise")
-    return z.selectExpr(
-        "lang", "source", "n_true", "noise",
-        "CAST(n_true + noise AS BIGINT) AS released",
-        "CAST(CASE WHEN n_true + noise >= 3 THEN 1 ELSE 0 END"
-        " AS BIGINT) AS published",
-    )
-
-
-# --- Cohen's kappa annotator agreement (q406) ----------------------------------------
-
-
-def _kappa_labels_sql(divop: str) -> str:
-    return f"""SELECT source,
-              (doc_id * 7) % 3 AS a1,
-              CASE WHEN (doc_id {divop} 20) % 5 = 1
-                   THEN ((doc_id * 7) % 3 + 1 + (doc_id {divop} 100) % 2) % 3
-                   ELSE (doc_id * 7) % 3 END AS a2
-       FROM documents"""
-
-
-def _kappa_tail_sql() -> str:
-    return """cm AS (SELECT source, a1, a2,
-                    CAST(count(*) AS BIGINT) AS n
-             FROM lab GROUP BY source, a1, a2),
-       r AS (SELECT source, a1 AS lbl, CAST(sum(n) AS BIGINT) AS rn
-             FROM cm GROUP BY source, a1),
-       c AS (SELECT source, a2 AS lbl, CAST(sum(n) AS BIGINT) AS cn
-             FROM cm GROUP BY source, a2),
-       pe AS (SELECT r.source,
-                     CAST(sum(r.rn * c.cn) AS BIGINT) AS pe_num
-              FROM r JOIN c ON r.source = c.source AND r.lbl = c.lbl
-              GROUP BY r.source),
-       po AS (SELECT source,
-                     CAST(sum(n) AS BIGINT) AS n_docs,
-                     CAST(sum(CASE WHEN a1 = a2 THEN n ELSE 0 END)
-                       AS BIGINT) AS agree
-              FROM cm GROUP BY source)
-       SELECT po.source, po.n_docs, po.agree, pe.pe_num,
-              CAST(po.n_docs * po.agree - pe.pe_num AS DOUBLE)
-                / CAST(po.n_docs * po.n_docs - pe.pe_num AS DOUBLE)
-                AS kappa
-       FROM po JOIN pe ON po.source = pe.source"""
-
-
-@query(
-    "q406_cohens_kappa",
-    f"WITH lab AS ({_kappa_labels_sql('//')}),\n       "
-    f"{_kappa_tail_sql()}",
-)
-def q406(spark, sf_dir):
-    """Cohen's kappa inter-annotator agreement — the annotation-QA
-    statistic a labeling pipeline computes before trusting weak
-    supervision (q363's votes assume it): two deterministic
-    3-class annotators where annotator 2 disagrees on exactly the
-    (doc_id div 20) % 5 == 1 class — div-derived BECAUSE source is a
-    doc_id % 20 class, so a %5 selector would be constant per source
-    (the gcd lesson, caught live: the naive selector gave whole
-    sources kappa 1.0 / -0.5) — with the disagreement offset from
-    doc_id div 100, so every source agrees on ~4/5 of its docs and
-    kappa sits strictly below raw agreement (chance correction).  Exact-integer form: kappa =
-    (N*agree - pe_num) / (N^2 - pe_num) with pe_num = sum_i
-    row_i*col_i — ONE float division of exact BIGINTs, identical
-    expression tree both engines.  Shape: one groupBy to the
-    bounded (source, a1, a2) confusion table, marginals and the
-    chance term from that table alone — the corpus is scanned
-    once."""
-    docs = _t(spark, sf_dir, "documents")
-    lab = docs.selectExpr(
-        "source",
-        "(doc_id * 7) % 3 AS a1",
-        "CASE WHEN (doc_id div 20) % 5 = 1"
-        " THEN ((doc_id * 7) % 3 + 1 + (doc_id div 100) % 2) % 3"
-        " ELSE (doc_id * 7) % 3 END AS a2",
-    )
-    lab.createOrReplaceTempView("q406_lab")
-    return spark.sql(
-        "WITH lab AS (SELECT * FROM q406_lab),\n       "
-        + _kappa_tail_sql())
-
-
-# --- per-host geographic principal axis (q407) ---------------------------------------
-
-_Q407_EIG = (
-    "(ad + cd)/2 + sqrt(((ad - cd)/2)*((ad - cd)/2) + bd*bd)"
-)
-
-
-def _q407_sql(divop: str) -> str:
-    # overflow guard lives in the ORACLE only (the q166 pattern):
-    # DuckDB error() makes a fixture that outgrows the exact-BIGINT
-    # moment bound fail LOUDLY instead of silently wrapping.
-    guard = ("CASE WHEN n > 200000 THEN CAST(error("
-             "'q407 fixture outgrew BIGINT moment bound') AS BIGINT) "
-             "ELSE n*sxx - sx*sx END"
-             if divop == "//" else "n*sxx - sx*sx")
-    vt = "VARCHAR" if divop == "//" else "STRING"
-    return f"""WITH p0 AS (SELECT 'host' || CAST(doc_id % 40 AS {vt}) AS host,
-                     (doc_id % 40) % 4 AS cls,
-                     (doc_id * 9973) % 36000 AS t,
-                     (doc_id * 7919) % 16000 AS u
-              FROM documents),
-       p AS (SELECT host,
-                    CASE WHEN cls = 2 THEN u
-                         WHEN cls = 3 THEN t {divop} 8
-                         ELSE t END AS ix,
-                    CASE WHEN cls = 2 THEN t {divop} 2
-                         WHEN cls = 3
-                           THEN 16000 - (t {divop} 3) + (u {divop} 64)
-                         ELSE u END AS iy
-             FROM p0),
-       m AS (SELECT host, CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum(ix) AS BIGINT) AS sx,
-                    CAST(sum(iy) AS BIGINT) AS sy,
-                    CAST(sum(ix*ix) AS BIGINT) AS sxx,
-                    CAST(sum(iy*iy) AS BIGINT) AS syy,
-                    CAST(sum(ix*iy) AS BIGINT) AS sxy
-             FROM p GROUP BY host),
-       g AS (SELECT host, n,
-                    {guard} AS a,
-                    n*syy - sy*sy AS c,
-                    n*sxy - sx*sy AS b
-             FROM m),
-       d AS (SELECT host, n, CAST(a AS DOUBLE) AS ad,
-                    CAST(c AS DOUBLE) AS cd, CAST(b AS DOUBLE) AS bd
-             FROM g),
-       e AS (SELECT host, n, ad, cd, bd, {_Q407_EIG} AS eig1 FROM d)
-       SELECT host, n, eig1,
-              (ad + cd) - eig1 AS eig2,
-              CASE WHEN (ad + cd) - eig1 <= 0 THEN -1.0
-                   ELSE eig1 / ((ad + cd) - eig1) END AS anisotropy,
-              CASE WHEN bd = 0 AND ad >= cd THEN 0
-                   WHEN bd = 0 THEN 1
-                   WHEN (eig1 - ad) * (CASE WHEN bd < 0 THEN -1 ELSE 1 END)
-                        >= abs(bd) THEN 1
-                   WHEN (eig1 - ad) * (CASE WHEN bd < 0 THEN -1 ELSE 1 END)
-                        >= 0 THEN 0
-                   WHEN -((eig1 - ad) * (CASE WHEN bd < 0 THEN -1 ELSE 1 END))
-                        >= abs(bd) THEN 2
-                   ELSE 3 END AS axis_sector
-       FROM e"""
-
-
-@query("q407_geo_principal_axis", _q407_sql("//"))
-def q407(spark, sf_dir):
-    """Per-host geographic principal axis — the directional-spread
-    statistic (2x2 PCA of each host's point cloud) that complements
-    q341's geo-concentration HHI: is a host's audience spread
-    east-west, north-south, or diagonal, and how anisotropic?
-    Moments stay EXACT BIGINTs in integer centi-degrees (n, Sx, Sy,
-    Sxx, Syy, Sxy — one combinable groupBy over the 40-host
-    lexicon); the n-scaled covariance entries a = n*Sxx - Sx^2 etc.
-    are exact integers (oracle error-guards n > 2*10^5 so overflow
-    is LOUD, the q166 pattern), and only then does ONE shared float
-    expression compute eig1 = (a+c)/2 + sqrt(((a-c)/2)^2 + b^2) —
-    closed-form symmetric eigenvalues, a correctly-rounded IEEE sqrt
-    over identical doubles (the q355 contract), eig2 via the exact
-    trace identity.  The axis direction is classified into 4 integer
-    sectors by sign/magnitude comparisons on the eigenvector
-    (b, eig1 - a) — no atan2, the q74 rule; per-host-class fixture
-    transforms (swap / steep anti-correlated) exercise all four
-    sectors AND keep every det > 0.  Linear scan, bounded output."""
-    # engine side shares the exact SQL text modulo nothing — all
-    # arithmetic here is %, *, CASE; run it through spark.sql on a
-    # temp view to keep the expression trees literally identical.
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q407_docs")
-    return spark.sql(_q407_sql("div").replace("FROM documents",
-                                              "FROM q407_docs"))
-
-
-# --- 1-D earth-mover drift between snapshots (q408) ----------------------------------
-
-
-def _q408_sql(divop: str) -> str:
-    return f"""WITH s AS (SELECT lang,
-                    CASE WHEN doc_id % 2 = 0 THEN 0 ELSE 1 END AS snap,
-                    CASE WHEN doc_id % 2 = 0
-                         THEN n_chars {divop} 64
-                         ELSE (n_chars + ((doc_id {divop} 2) % 3) * 64)
-                              {divop} 64
-                    END AS bin
-             FROM documents),
-       cb AS (SELECT lang, bin,
-                     CAST(sum(CASE WHEN snap = 0 THEN 1 ELSE 0 END)
-                       AS BIGINT) AS ca,
-                     CAST(sum(CASE WHEN snap = 1 THEN 1 ELSE 0 END)
-                       AS BIGINT) AS cb
-              FROM s GROUP BY lang, bin),
-       cum AS (SELECT lang, bin,
-                      CAST(sum(ca) OVER (PARTITION BY lang ORDER BY bin
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cuma,
-                      CAST(sum(cb) OVER (PARTITION BY lang ORDER BY bin
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumb,
-                      CAST(coalesce(lead(bin) OVER (PARTITION BY lang
-                        ORDER BY bin), bin) - bin AS BIGINT) AS gap
-               FROM cb),
-       tot AS (SELECT lang, CAST(max(cuma) AS BIGINT) AS na,
-                     CAST(max(cumb) AS BIGINT) AS nb
-               FROM cum GROUP BY lang)
-       SELECT cum.lang, tot.na, tot.nb,
-              CAST(sum(abs(cum.cuma * tot.nb - cum.cumb * tot.na)
-                       * cum.gap) AS BIGINT) AS emd_num,
-              CAST(sum(CASE WHEN cum.gap = 0
-                       THEN abs(cum.cuma * tot.nb - cum.cumb * tot.na)
-                       ELSE 0 END) AS BIGINT) AS final_gap,
-              CAST(sum(abs(cum.cuma * tot.nb - cum.cumb * tot.na)
-                       * cum.gap) AS DOUBLE)
-                / CAST(tot.na * tot.nb AS DOUBLE) AS emd_bins
-       FROM cum JOIN tot ON cum.lang = tot.lang
-       GROUP BY cum.lang, tot.na, tot.nb"""
-
-
-@query("q408_emd_drift", _q408_sql("//"))
-def q408(spark, sf_dir):
-    """1-D earth-mover (Wasserstein-1) drift between two crawl
-    snapshots' doc-length distributions per language — the
-    transport-metric companion to q284's chi-square localization
-    (chi-square sees reshuffling, EMD sees HOW FAR mass moved): the
-    odd-doc snapshot's lengths are shifted up 0-2 bins by a
-    div-derived growth term, planted drift both metrics should see.
-    Exact-integer form: over the BOUNDED bin domain, EMD_1D =
-    sum_k |CumA_k - CumB_k| dk becomes sum |CumA*nB - CumB*nA| *
-    gap-to-next-present-bin — cross-multiplied BIGINTs (no per-bin
-    division), cumulative + lead windows over <= |domain| rows per
-    lang, NEVER the corpus; one division at the end.  final_gap
-    replays the conservation proof: the LAST bin's cum difference is
-    |nA*nB - nB*nA| = 0 by construction, so the column is 0 exactly
-    when both CDFs end at their totals — loudly nonzero if a
-    snapshot's mass leaks."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q408_docs")
-    return spark.sql(_q408_sql("div").replace("FROM documents",
-                                              "FROM q408_docs"))
-
-
-# --- pass@k evaluation estimator (q409) ----------------------------------------------
-
-
-def _passk_case() -> str:
-    """Nested CASE: C(10-c, k) for k in {1,5,10}, c in 0..10 —
-    binomials precomputed in Python (math.comb), inlined verbatim so
-    both engines share the exact lookup."""
-    import math
-    outer = []
-    for k in (1, 5, 10):
-        inner = " ".join(
-            f"WHEN {c} THEN {math.comb(10 - c, k) if 10 - c >= k else 0}"
-            for c in range(11)
-        )
-        outer.append(f"WHEN {k} THEN (CASE c {inner} END)")
-    return "CASE k " + " ".join(outer) + " END"
-
-
-_PASSK_TOTAL = {k: __import__("math").comb(10, k) for k in (1, 5, 10)}
-
-
-def _q409_sql(divop: str) -> str:
-    ck = (f"CASE k WHEN 1 THEN {_PASSK_TOTAL[1]} WHEN 5 THEN "
-          f"{_PASSK_TOTAL[5]} ELSE {_PASSK_TOTAL[10]} END")
-    return f"""WITH att AS (SELECT doc_id {divop} 10 AS task,
-                    CASE WHEN (doc_id * 13) % 11
-                              < (doc_id {divop} 10) % 11
-                         THEN 1 ELSE 0 END AS correct
-             FROM documents),
-       t AS (SELECT task, CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum(correct) AS BIGINT) AS c
-             FROM att GROUP BY task),
-       tf AS (SELECT task, c FROM t WHERE n = 10),
-       ks AS (SELECT CAST(k.k AS BIGINT) AS k
-              FROM (VALUES (1), (5), (10)) k(k)),
-       pe AS (SELECT ks.k, tf.c, {_passk_case()} AS comb
-              FROM ks CROSS JOIN tf)
-       SELECT k,
-              CAST(count(*) AS BIGINT) AS n_tasks,
-              CAST(sum(comb) AS BIGINT) AS sum_comb,
-              CAST(count(*) * ({ck}) AS BIGINT) AS denom,
-              CAST(count(*) * ({ck}) - sum(comb) AS DOUBLE)
-                / CAST(count(*) * ({ck}) AS DOUBLE) AS pass_at_k
-       FROM pe GROUP BY k"""
-
-
-@query("q409_pass_at_k", _q409_sql("//"))
-def q409(spark, sf_dir):
-    """pass@k evaluation estimator — the standard LLM code-eval
-    statistic (Chen et al. 2021's unbiased form) computed EXACTLY:
-    per task of n=10 attempts with c correct, pass@k = 1 -
-    C(n-c,k)/C(n,k), and the mean over tasks collapses to ONE
-    division of exact BIGINTs, (T*C(10,k) - sum_i C(10-c_i,k)) /
-    (T*C(10,k)) — no per-task float, no unordered float sum (the
-    q179 lesson applied by ALGEBRA instead of pivot tricks).  The
-    11x3 binomial lookup is precomputed by Python math.comb and
-    inlined verbatim in both engines; ragged tail tasks (n < 10)
-    are excluded deterministically as the metric requires.  The
-    per-task correctness threshold task % 11 against the 11-cycle
-    (doc_id*13) % 11 makes c span the FULL 0..10 lookup domain
-    (c = 0 tasks exist, so pass@10 < 1 — the first cut's +1 floor
-    made pass@10 degenerate at exactly 1.0, caught live).  Shape: one combinable groupBy to the bounded
-    task table, a 3-row k explode, one aggregation — linear."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q409_docs")
-    return spark.sql(_q409_sql("div").replace("FROM documents",
-                                              "FROM q409_docs"))
-
-
-# --- cross-host mirror detection (q410) ----------------------------------------------
-
-
-def _q410_sql(divop: str) -> str:
-    vt = "VARCHAR" if divop == "//" else "STRING"
-    return f"""WITH base AS (SELECT doc_id,
-                      'h' || CAST(doc_id % 40 AS {vt}) AS host,
-                      md5(text) AS fp
-               FROM documents),
-       mirr AS (SELECT doc_id + 1000000 AS doc_id,
-                       'm' || CAST(doc_id % 40 AS {vt}) AS host, fp
-                FROM base
-                WHERE (doc_id {divop} 40) % 4 <> 3
-                   OR doc_id % 40 < 5),
-       allx AS (SELECT * FROM base UNION ALL SELECT * FROM mirr),
-       fdf AS (SELECT fp FROM allx GROUP BY fp HAVING count(*) <= 60),
-       x AS (SELECT allx.host, allx.fp FROM allx
-             JOIN fdf ON allx.fp = fdf.fp),
-       hn AS (SELECT host, CAST(count(*) AS BIGINT) AS n
-              FROM x GROUP BY host),
-       pairs AS (SELECT a.host AS host_a, b.host AS host_b,
-                        CAST(count(*) AS BIGINT) AS shared
-                 FROM x a JOIN x b
-                   ON a.fp = b.fp AND a.host < b.host
-                 GROUP BY a.host, b.host),
-       j AS (SELECT p.host_a, p.host_b, p.shared,
-                    ha.n AS n_a, hb.n AS n_b
-             FROM pairs p
-             JOIN hn ha ON p.host_a = ha.host
-             JOIN hn hb ON p.host_b = hb.host)
-       SELECT host_a, host_b, shared, n_a, n_b,
-              CAST(CASE WHEN 10 * shared >=
-                        3 * (n_a + n_b - shared)
-                   THEN 1 ELSE 0 END AS BIGINT) AS near_mirror,
-              CAST(CASE WHEN shared = least(n_a, n_b)
-                   THEN 1 ELSE 0 END AS BIGINT) AS full_containment,
-              CAST(CASE WHEN shared = n_a AND shared = n_b
-                   THEN 1 ELSE 0 END AS BIGINT) AS identical_sets,
-              CAST(shared AS DOUBLE)
-                / CAST(n_a + n_b - shared AS DOUBLE) AS jaccard
-       FROM j WHERE 20 * shared >= n_a + n_b - shared"""
-
-
-@query("q410_mirror_hosts", _q410_sql("//"))
-def q410(spark, sf_dir):
-    """Cross-host mirror-site detection — the Common-Crawl dedup op
-    q323's WITHIN-host template detector cannot see: hosts serving
-    (near-)identical document SETS.  Per-doc content fingerprint
-    (md5 of text, equality-only so the hex string itself is the
-    key), an ABSOLUTE df-cap of 60 docs per fingerprint (the q19
-    lesson — boilerplate fingerprints shared by everyone would make
-    the self-join quadratic; the cap removes them and the REAL
-    mirror signal lives in sub-cap content), then the host-pair
-    shared-count via one fingerprint equi-join grouped to <=
-    C(80,2) host pairs.  Jaccard and the near-mirror flag are
-    integer cross-multiplications (10*shared >= 3*union); the
-    injected mirror hosts re-serve ~3/4 of each origin host's docs
-    (selector div-derived — doc_id % 4 is CONSTANT inside a %40
-    host class, the gcd trap's third live catch) so partial mirrors
-    sit at jaccard ~3/4 — SUBSETS, hence full_containment = 1 but
-    identical_sets = 0 (the flag split a first cut conflated) —
-    while hosts 0-4 mirror completely and pin identical_sets = 1.  Reported pairs are
-    Jaccard >= 1/21 (cross-multiplied) so output stays bounded at
-    any corpus size; candidate volume is sum_fp df^2 <= 60 * corpus
-    — linear under the cap."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q410_docs")
-    return spark.sql(_q410_sql("div").replace("FROM documents",
-                                              "FROM q410_docs"))
-
-
 # --- stream-stream interval join attribution (q411) ----------------------------------
 
 
@@ -24647,6 +9926,7 @@ def q410(spark, sf_dir):
               CAST(count(DISTINCT click_id) AS BIGINT) AS n_clicks,
               CAST(count(DISTINCT imp_id) AS BIGINT) AS n_imps
        FROM j GROUP BY user_id % 50""",
+    kind="operator",
 )
 def q411(spark, sf_dir):
     """Click-to-impression attribution as a REAL stream-stream
@@ -24667,688 +9947,6 @@ def q411(spark, sf_dir):
     from gdal_spark.streaming.windowed import stream_click_attribution
 
     return stream_click_attribution(spark, f"{sf_dir}/events.parquet")
-
-
-# --- arena preference ranking (q412) -------------------------------------------------
-
-
-def _q412_sql(divop: str) -> str:
-    return f"""WITH b AS (SELECT doc_id,
-                    doc_id % 8 AS ma,
-                    (doc_id % 8 + 1 + (doc_id {divop} 8) % 7) % 8 AS mb
-             FROM documents),
-       w AS (SELECT ma, mb,
-                    CASE WHEN (doc_id * 31) % 16 < 8 + ma - mb
-                         THEN ma ELSE mb END AS winner
-             FROM b),
-       pw AS (SELECT least(ma, mb) AS lo, greatest(ma, mb) AS hi,
-                     CAST(sum(CASE WHEN winner = least(ma, mb)
-                              THEN 1 ELSE 0 END) AS BIGINT) AS lo_wins,
-                     CAST(sum(CASE WHEN winner = greatest(ma, mb)
-                              THEN 1 ELSE 0 END) AS BIGINT) AS hi_wins
-              FROM w GROUP BY least(ma, mb), greatest(ma, mb)),
-       e AS (SELECT lo AS m, hi AS o,
-                    CASE WHEN lo_wins > hi_wins THEN 1
-                         WHEN lo_wins < hi_wins THEN -1
-                         ELSE 0 END AS s,
-                    lo_wins AS wins FROM pw
-             UNION ALL
-             SELECT hi, lo,
-                    CASE WHEN hi_wins > lo_wins THEN 1
-                         WHEN hi_wins < lo_wins THEN -1
-                         ELSE 0 END,
-                    hi_wins FROM pw),
-       agg AS (SELECT m,
-                      CAST(sum(s) AS BIGINT) AS copeland,
-                      CAST(sum(wins) AS BIGINT) AS borda,
-                      CAST(count(*) AS BIGINT) AS n_opponents
-               FROM e GROUP BY m)
-       SELECT CAST(m AS BIGINT) AS model, copeland, borda, n_opponents,
-              CAST(row_number() OVER (ORDER BY copeland DESC,
-                                      borda DESC, m) AS BIGINT) AS rnk
-       FROM agg"""
-
-
-@query("q412_arena_ranking", _q412_sql("//"))
-def q412(spark, sf_dir):
-    """Arena-style preference ranking (Copeland + Borda) — the
-    pairwise-battle leaderboard an LLM-eval pipeline computes from
-    human votes, in EXACT integers where the Elo/Bradley-Terry forms
-    would drag in transcendentals: battles pair model doc_id % 8
-    against an offset opponent (offset div-derived so every ordered
-    pair occurs), the winner decided by a deterministic
-    strength-plus-hash rule where higher model id wins more often;
-    ONE groupBy to the bounded C(8,2) pairwise-wins table, then each
-    pair emits two directed rows — Copeland score = sum of beat
-    signs (+1/-1/0), Borda = total wins — and row_number over the
-    8-row aggregate gives the leaderboard with the (copeland, borda,
-    id) tiebreak pinned.  Battles scan once; everything after is
-    domain-bounded.  `rank` is reserved in DuckDB (alias rnk)."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q412_docs")
-    return spark.sql(_q412_sql("div").replace("FROM documents",
-                                              "FROM q412_docs"))
-
-
-# --- LSM compaction amplification planning (q413) ------------------------------------
-
-
-def _q413_levels_case(t: int) -> str:
-    """Smallest l with mem * t^l >= total, mem = 64 — 13-branch
-    integer CASE with t^l precomputed (no log), shared verbatim."""
-    br = " ".join(
-        f"WHEN total <= {64 * t ** l} THEN {l}" for l in range(13)
-    )
-    return f"CASE {br} ELSE 13 END"
-
-
-def _q413_sql(divop: str = "//") -> str:
-    pol = []
-    for t in (4, 10):
-        pol.append(f"""SELECT source, total, {t} AS fanout,
-                    {_q413_levels_case(t)} AS levels
-             FROM ing""")
-    body = " UNION ALL ".join(pol)
-    return f"""WITH ing AS (SELECT source,
-                    CAST(sum(n_chars * (1 + doc_id % 16)) AS BIGINT)
-                      AS total
-             FROM documents GROUP BY source),
-       lv AS ({body})
-       SELECT source, total, CAST(fanout AS BIGINT) AS fanout,
-              CAST(levels AS BIGINT) AS levels,
-              CAST(1 + fanout * levels AS BIGINT) AS leveled_wa,
-              CAST(1 + levels AS BIGINT) AS tiered_wa,
-              CAST(levels AS BIGINT) AS leveled_ra,
-              CAST(levels * fanout AS BIGINT) AS tiered_ra,
-              CAST(1000 + 1000 {divop} fanout AS BIGINT)
-                AS leveled_sa_x1000,
-              CAST(2000 AS BIGINT) AS tiered_sa_x1000
-       FROM lv"""
-
-
-@query("q413_lsm_amplification", _q413_sql())
-def q413(spark, sf_dir):
-    """LSM-tree compaction planning — the write/read/space
-    amplification dashboard (the RocksDB/Cassandra sizing decision)
-    the storage ops q352/q391/q396 stop short of: per source, total
-    ingest bytes (per-doc replication weight 1 + doc_id % 16 spreads
-    sources across level boundaries) fix the level count L = min l
-    with mem*T^l >= total
-    (a 13-branch integer CASE with T^l precomputed — no logarithm,
-    the q243 idiom generalized to fanout 10), then the standard
-    closed forms in EXACT integers: leveled WA = 1 + T*L / RA = L /
-    SA = 1 + 1/T (emitted x1000 to stay integral), tiered WA = 1 + L
-    / RA = L*T / SA = 2 — the classic mirror-image tradeoff, both
-    policies emitted per source so the crossover is visible in one
-    table.  One combinable groupBy to the bounded source table; the
-    policy axis is a 2-way union over 20 rows, not a corpus rescan."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q413_docs")
-    return spark.sql(_q413_sql("div").replace("FROM documents",
-                                              "FROM q413_docs"))
-
-
-# --- BLEU modified n-gram precisions (q414) ------------------------------------------
-
-
-def _q414_w_sql(engine: str) -> str:
-    if engine == "spark":
-        # ONE O(L) split per doc + posexplode — the q166 engine
-        # idiom.  The range-join form recomputed length(replace())
-        # per (doc, pos) row, 2000x per doc (31 s at sf0.1).
-        return """SELECT doc_id, p + 1 AS pos, word
-             FROM (SELECT doc_id,
-                          posexplode(split(text, ' ')) AS (p, word)
-                   FROM documents) t"""
-    return """SELECT doc_id, r.range AS pos,
-                    split_part(text, ' ', CAST(r.range AS INT)) AS word
-             FROM (SELECT doc_id, text,
-                          CASE WHEN length(text)
-                                    - length(replace(text, ' ', ''))
-                                    + 1 > 1990
-                               THEN error(
-                                 'q414 fixture outgrew range bound')
-                               ELSE length(text)
-                                    - length(replace(text, ' ', '')) + 1
-                          END AS n_words
-                   FROM documents) d, range(1, 2000) r
-             WHERE r.range <= d.n_words"""
-
-
-_Q414_CAND = """SELECT doc_id, word,
-                       row_number() OVER (PARTITION BY doc_id
-                         ORDER BY pos, copy) AS np
-                FROM (SELECT w.doc_id, w.pos, w.word, c.copy
-                      FROM w, (VALUES (1), (2)) c(copy)
-                      WHERE w.pos % 7 <> 0
-                        AND c.copy <= CASE WHEN w.pos % 11 = 0
-                                      THEN 2 ELSE 1 END) cexp"""
-
-_Q414_TAIL = """cg AS (SELECT doc_id, 1 AS n, word AS gram FROM cand
-              UNION ALL
-              SELECT a.doc_id, 2, a.word || ' ' || b.word
-              FROM cand a JOIN cand b
-                ON a.doc_id = b.doc_id AND b.np = a.np + 1),
-       rg AS (SELECT doc_id, 1 AS n, word AS gram FROM w
-              UNION ALL
-              SELECT a.doc_id, 2, a.word || ' ' || b.word
-              FROM w a JOIN w b
-                ON a.doc_id = b.doc_id AND b.pos = a.pos + 1),
-       cc AS (SELECT doc_id, n, gram, CAST(count(*) AS BIGINT) AS c
-              FROM cg GROUP BY doc_id, n, gram),
-       rc AS (SELECT doc_id, n, gram, CAST(count(*) AS BIGINT) AS c
-              FROM rg GROUP BY doc_id, n, gram),
-       cl AS (SELECT cc.n,
-                     CAST(sum(least(cc.c, rc.c)) AS BIGINT) AS clipped
-              FROM cc JOIN rc ON cc.doc_id = rc.doc_id
-                 AND cc.n = rc.n AND cc.gram = rc.gram
-              GROUP BY cc.n),
-       tot AS (SELECT n, CAST(sum(c) AS BIGINT) AS total
-               FROM cc GROUP BY n)
-       SELECT CAST(tot.n AS BIGINT) AS n, cl.clipped, tot.total,
-              CAST(cl.clipped AS DOUBLE) / CAST(tot.total AS DOUBLE)
-                AS precision_n
-       FROM tot JOIN cl ON tot.n = cl.n"""
-
-
-def _q414_sql(engine: str) -> str:
-    return (f"WITH w AS MATERIALIZED ({_q414_w_sql(engine)}),\n"
-            f"       cand AS MATERIALIZED ({_Q414_CAND}),\n"
-            f"       {_Q414_TAIL}")
-
-
-@query("q414_bleu_precisions", _q414_sql("duck"))
-def q414(spark, sf_dir):
-    """BLEU modified n-gram precisions (Papineni et al.) — the MT/
-    generation-eval metric whose CLIPPING rule (candidate gram count
-    capped at the reference count) is the part naive overlap metrics
-    get wrong, exercised here by a candidate that DUPLICATES every
-    11th word (clip binds: duplicated grams exceed their reference
-    count) and drops every 7th (recall loss): candidate word order
-    is rebuilt relationally — explode positions via the fixed-range
-    + error() guard (the q166 pattern), fan copies out through a
-    VALUES(1),(2) join, re-rank with one row_number window — and
-    n-grams form by DENSE-KEY offset-1 equi-joins (the q394 runs
-    idiom), never per-row HOF loops.  Corpus-level precision per n =
-    sum least(c_cand, c_ref) / sum c_cand over the (doc, gram)
-    count tables: exact BIGINTs, inner join suffices for the clipped
-    sum (missing reference grams clip to 0), ONE division per n.
-    Brevity penalty's exp is out of scope by the no-transcendental
-    rule; the clipped/total pair is the auditable core."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q414_docs")
-    # Spark inlines CTEs per reference: `w` feeds four consumers and
-    # `cand` two, so the 10M-row position explode re-ran 4-6x (122 s
-    # at sf0.1, caught by the bench top-up).  Materialize both once.
-    w = spark.sql(_q414_w_sql("spark").replace(
-        "FROM documents", "FROM q414_docs")).localCheckpoint()
-    w.createOrReplaceTempView("q414_w")
-    cand = spark.sql(
-        "WITH w AS (SELECT * FROM q414_w) " + _Q414_CAND
-    ).localCheckpoint()
-    cand.createOrReplaceTempView("q414_cand")
-    return spark.sql(
-        "WITH w AS (SELECT * FROM q414_w),\n"
-        "     cand AS (SELECT * FROM q414_cand),\n       "
-        + _Q414_TAIL)
-
-
-# --- snap points to nearest segment (q415) -------------------------------------------
-
-
-def _q415_cand_sql(divop: str) -> str:
-    """Shared candidate derivation: deci-degree integer coords keep
-    cross^2 <= ~1.7e12 (exact in DOUBLE, far under 2^53)."""
-    return f"""SELECT p.doc_id, s.seg, s.len2,
-              (s.bx - s.ax) * (p.px - s.ax)
-                + (s.by - s.ay) * (p.py - s.ay) AS dot,
-              (s.bx - s.ax) * (p.py - s.ay)
-                - (s.by - s.ay) * (p.px - s.ax) AS crs,
-              p.px, p.py, s.ax, s.ay, s.bx, s.by
-       FROM (SELECT doc_id,
-                    ((doc_id * 9973) % 36000) {divop} 10 AS px,
-                    ((doc_id * 7919) % 16000) {divop} 10 AS py
-             FROM documents) p
-       CROSS JOIN
-            (SELECT n_nationkey AS seg,
-                    (n_nationkey * 97) % 3600 AS ax,
-                    (n_nationkey * 131) % 1600 AS ay,
-                    (n_nationkey * 97) % 3600 + 200
-                      + (n_nationkey % 7) * 50 AS bx,
-                    (n_nationkey * 131) % 1600 - 160
-                      + (n_nationkey % 9) * 40 AS by,
-                    (200 + (n_nationkey % 7) * 50)
-                      * (200 + (n_nationkey % 7) * 50)
-                    + ((n_nationkey % 9) * 40 - 160)
-                      * ((n_nationkey % 9) * 40 - 160) AS len2
-             FROM nation) s"""
-
-
-_Q415_D2 = """CASE WHEN dot <= 0
-                   THEN CAST((px - ax)*(px - ax) + (py - ay)*(py - ay)
-                        AS DOUBLE)
-                   WHEN dot >= len2
-                   THEN CAST((px - bx)*(px - bx) + (py - by)*(py - by)
-                        AS DOUBLE)
-                   ELSE CAST(crs * crs AS DOUBLE) / CAST(len2 AS DOUBLE)
-              END"""
-
-_Q415_BR = """CASE WHEN dot <= 0 THEN 0
-                   WHEN dot >= len2 THEN 1
-                   ELSE 2 END"""
-
-
-def _q415_oracle_sql() -> str:
-    return f"""WITH cand0 AS ({_q415_cand_sql('//')}),
-       cand AS (SELECT doc_id, seg, {_Q415_D2} AS d2,
-                       CAST({_Q415_BR} AS BIGINT) AS branch
-                FROM cand0),
-       mn AS (SELECT doc_id, min(d2) AS mn FROM cand GROUP BY doc_id),
-       w1 AS (SELECT c.doc_id, CAST(min(c.seg) AS BIGINT) AS seg,
-                     mn.mn AS d2
-              FROM cand c JOIN mn
-                ON c.doc_id = mn.doc_id AND c.d2 = mn.mn
-              GROUP BY c.doc_id, mn.mn),
-       w2 AS (SELECT w1.doc_id, w1.seg, w1.d2, c.branch
-              FROM w1 JOIN cand c
-                ON c.doc_id = w1.doc_id AND c.seg = w1.seg)
-       SELECT seg, CAST(count(*) AS BIGINT) AS n_snapped,
-              CAST(sum(CASE WHEN branch = 2 THEN 1 ELSE 0 END)
-                AS BIGINT) AS interior_snaps,
-              CAST(sum(CASE WHEN branch <> 2 THEN 1 ELSE 0 END)
-                AS BIGINT) AS endpoint_snaps,
-              max(d2) AS max_d2
-       FROM w2 GROUP BY seg"""
-
-
-@query("q415_snap_to_segment", _q415_oracle_sql())
-def q415(spark, sf_dir):
-    """Snap-to-nearest-segment — the map-matching primitive under
-    q217's linear referencing (OGRLineString::Project semantics,
-    reference ogr/ogrlinestring.cpp): for each point and a 25-segment
-    broadcast network, the point-to-segment distance is the exact
-    three-branch form (endpoint A when dot <= 0, endpoint B when
-    dot >= len2, else the perpendicular cross^2/len2) with EVERY
-    intermediate an exact BIGINT in deci-degree coords (cross^2 <=
-    1.7e12, exact in DOUBLE) and the interior branch's ONE division
-    correctly rounded identically in both engines.  The engine-side
-    argmin is F.min over struct(d2, seg, branch) — map-side
-    combinable, ties to the smallest segment id — mirrored in the
-    oracle as the THREE-phase min/min-seg/branch-join (the q334
-    struct-extract lesson); identical IEEE inputs make the float
-    equality join safe.  Candidates are |corpus| x 25 with the tiny
-    side broadcast — linear, one shuffle for the argmin groupBy."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q415_docs")
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("q415_nation")
-    cand0 = spark.sql(
-        _q415_cand_sql("div")
-        .replace("FROM documents", "FROM q415_docs")
-        .replace("FROM nation", "FROM q415_nation"))
-    cand = cand0.selectExpr(
-        "doc_id", "seg", f"{_Q415_D2} AS d2",
-        f"CAST({_Q415_BR} AS BIGINT) AS branch")
-    w = cand.groupBy("doc_id").agg(
-        F.min(F.struct("d2", "seg", "branch")).alias("s"))
-    return w.select(
-        F.col("s.seg").cast("long").alias("seg"),
-        F.col("s.d2").alias("d2"), F.col("s.branch").alias("branch"),
-    ).groupBy("seg").agg(
-        F.count("*").cast("long").alias("n_snapped"),
-        F.sum(F.when(F.col("branch") == 2, 1).otherwise(0))
-        .cast("long").alias("interior_snaps"),
-        F.sum(F.when(F.col("branch") != 2, 1).otherwise(0))
-        .cast("long").alias("endpoint_snaps"),
-        F.max("d2").alias("max_d2"),
-    )
-
-
-# --- Matryoshka prefix-dimension recall (q416) ---------------------------------------
-
-
-def _q416_sql(engine: str) -> str:
-    if engine == "duck":
-        quant = ("list_transform(embedding, x -> CAST(floor("
-                 "CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        dot = ("CAST(list_dot_product("
-               "list_transform({a}, x -> CAST(x AS DOUBLE)), "
-               "list_transform({b}, x -> CAST(x AS DOUBLE))) AS BIGINT)")
-        pre = "{v}[1:16]"
-    else:
-        quant = ("transform(embedding, x -> CAST(floor("
-                 "CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))")
-        dot = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-               "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-        pre = "slice({v}, 1, 16)"
-    return f"""WITH v AS (SELECT vec_id, {quant} AS qv FROM embeddings),
-       q AS (SELECT vec_id AS qid, qv AS qqv FROM v WHERE vec_id < 8),
-       sc AS (SELECT q.qid, v.vec_id,
-                     {dot.format(a='v.qv', b='q.qqv')} AS full_dot,
-                     {dot.format(a=pre.format(v='v.qv'),
-                                 b=pre.format(v='q.qqv'))} AS pre_dot
-              FROM v CROSS JOIN q WHERE v.vec_id <> q.qid),
-       rf AS (SELECT qid, vec_id,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY full_dot DESC, vec_id) AS r
-              FROM sc),
-       rp AS (SELECT qid, vec_id,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY pre_dot DESC, vec_id) AS r
-              FROM sc)
-       SELECT rf.qid,
-              CAST(count(rp.vec_id) AS BIGINT) AS n_overlap,
-              CAST(count(rp.vec_id) AS DOUBLE) / 5.0 AS recall_at_5
-       FROM rf LEFT JOIN rp
-         ON rf.qid = rp.qid AND rf.vec_id = rp.vec_id AND rp.r <= 5
-       WHERE rf.r <= 5
-       GROUP BY rf.qid"""
-
-
-@query("q416_matryoshka_recall", _q416_sql("duck"))
-def q416(spark, sf_dir):
-    """Matryoshka prefix-dimension recall — the quantization-
-    tradeoff audit for nested (MRL-style) embeddings, the
-    dimension-axis companion to q365's 1-bit Hamming recall and
-    q139's IVF recall: score every (query, vector) pair by the full
-    64-dim dot product AND by the first-16-dims prefix dot in the
-    SAME pass over one cross join, rank both ways, and measure
-    top-5 overlap per query.  Embeddings are integer-quantized
-    (floor(x*1000 + 0.5), the q32 idiom) so every dot product is an
-    EXACT BIGINT — no float-sum-order hazard anywhere; the Spark
-    side folds zip_with through aggregate (linear per-row HOF, the
-    allowed shape) while DuckDB uses list_dot_product, both exact
-    over integers.  recall_at_5 = n_overlap/5 is the one division.
-    Scale shape: the query side is 8 broadcast rows; candidate
-    scoring is |corpus| x 8 — the brute-force baseline the IVF/PQ
-    paths (q32/q128/q148) shortcut, measured the same way."""
-    _t(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "q416_embeddings")
-    return spark.sql(_q416_sql("spark").replace("FROM embeddings",
-                                                "FROM q416_embeddings"))
-
-
-# --- greedy set cover for source selection (q417) ------------------------------------
-
-_Q417_CELL = "lang || '#' || CAST((doc_id*11)%12 AS {vt})"
-_Q417_R = 12
-
-
-def _q417_oracle_sql() -> str:
-    vt = _Q417_CELL.format(vt="VARCHAR")
-    parts = [f"""WITH cov AS MATERIALIZED (
-         SELECT DISTINCT source, {vt} AS cell FROM documents),
-       cum0 AS MATERIALIZED (SELECT cell FROM cov WHERE 1 = 0)"""]
-    for r in range(1, _Q417_R + 1):
-        parts.append(f""",
-       g{r} AS MATERIALIZED (
-         SELECT c.source, CAST(count(*) AS BIGINT) AS gain
-         FROM cov c LEFT JOIN cum{r-1} u ON c.cell = u.cell
-         WHERE u.cell IS NULL GROUP BY c.source),
-       p{r} AS MATERIALIZED (
-         SELECT source, gain FROM g{r}
-         ORDER BY gain DESC, source LIMIT 1),
-       cum{r} AS MATERIALIZED (
-         SELECT cell FROM cum{r-1}
-         UNION
-         SELECT c.cell FROM cov c JOIN p{r} USING (source))""")
-    rows = " UNION ALL ".join(
-        f"""SELECT {r} AS rnd, source, gain,
-              (SELECT CAST(count(*) AS BIGINT) FROM cum{r})
-                AS cum_covered FROM p{r}"""
-        for r in range(1, _Q417_R + 1))
-    parts.append(f""",
-       picks AS MATERIALIZED ({rows}),
-       uni AS (SELECT CAST(count(DISTINCT cell) AS BIGINT)
-                 AS universe FROM cov),
-       unc AS (SELECT CAST(count(*) AS BIGINT) AS final_uncovered
-               FROM (SELECT DISTINCT c.cell FROM cov c
-                     LEFT JOIN cum{_Q417_R} u ON c.cell = u.cell
-                     WHERE u.cell IS NULL) t)
-       SELECT CAST(rnd AS BIGINT) AS rnd, source, gain, cum_covered,
-              uni.universe,
-              CASE WHEN unc.final_uncovered > 0
-                   THEN CAST(error(
-                     'q417 greedy did not converge in 12 rounds')
-                     AS BIGINT)
-                   ELSE unc.final_uncovered END AS final_uncovered
-       FROM picks CROSS JOIN uni CROSS JOIN unc""")
-    return "".join(parts)
-
-
-@query("q417_set_cover_sources", _q417_oracle_sql())
-def q417(spark, sf_dir):
-    """Greedy set cover for source selection — the curation question
-    'what is the smallest source set whose documents span every
-    (language, capability) cell' (greedy is the ln(n)-approximation,
-    the best possible for set cover): the DISTRIBUTED part is the
-    corpus scan to the DISTINCT (source, cell) incidence table (one
-    combinable groupBy); the greedy itself is inherently sequential
-    over that DOMAIN-bounded table (<= |sources| x |cells| = 1200
-    rows — bounded by the schema, NOT the corpus, the rat.py
-    size-gate pattern), so the engine collects it once (loud assert)
-    and replays exact greedy in driver Python, while the oracle
-    unrolls 12 MATERIALIZED argmax stages (the q276 per-reference
-    inlining lesson).  Ties break to the lexicographically smallest
-    source; rounds after full coverage pick nothing (gain-0 rows are
-    never emitted); final_uncovered = 0 is the completeness proof
-    and the oracle error()s if the fixture ever outgrows 12 rounds.
-    The fixture converges in 8 picks with the classic greedy decay
-    (14,14,14,13,2,1,1,1 at sf0.01)."""
-    cell = _Q417_CELL.format(vt="STRING")
-    cov = _t(spark, sf_dir, "documents").selectExpr(
-        "source", f"{cell} AS cell").distinct()
-    rows = cov.collect()
-    assert len(rows) <= 10000, "q417 incidence table outgrew its bound"
-    inc = {}
-    for r in rows:
-        inc.setdefault(r["source"], set()).add(r["cell"])
-    universe = set().union(*inc.values()) if inc else set()
-    covered, picks = set(), []
-    for rnd in range(1, _Q417_R + 1):
-        gains = {s: len(c - covered) for s, c in inc.items()}
-        mg = max(gains.values()) if gains else 0
-        if mg == 0:
-            break
-        best = min(s for s, g in gains.items() if g == mg)
-        covered |= inc[best]
-        picks.append((rnd, best, mg, len(covered)))
-    assert covered == universe, "q417 greedy did not converge"
-    out = [(r, s, g, c, len(universe), 0) for r, s, g, c in picks]
-    return spark.createDataFrame(
-        out, "rnd long, source string, gain long, cum_covered long,"
-             " universe long, final_uncovered long")
-
-
-# --- quadkey tile-set compaction (q418) ----------------------------------------------
-
-
-def _q418_t8_sql(divop: str) -> str:
-    return f"""SELECT DISTINCT x, y FROM (
-         SELECT 2*(((doc_id {divop} 3) * 2654435761) % 16384 % 128)
-                  + i.i AS x,
-                2*(((doc_id {divop} 3) * 2654435761) % 16384 {divop} 128)
-                  + j.j AS y
-         FROM documents, (VALUES (0), (1)) i(i), (VALUES (0), (1)) j(j)
-         WHERE doc_id % 3 = 0
-         UNION ALL
-         SELECT (doc_id * 9973) % 256, (doc_id * 7919) % 256
-         FROM documents WHERE doc_id % 3 = 1
-         UNION ALL
-         SELECT 4*((doc_id*37) % 64) + i.i,
-                4*((doc_id*53) % 64) + j.j
-         FROM documents,
-              (VALUES (0), (1), (2), (3)) i(i),
-              (VALUES (0), (1), (2), (3)) j(j)
-         WHERE doc_id % 3 = 2) t"""
-
-
-def _q418_oracle_sql() -> str:
-    d = "//"
-    parts = [f"""WITH t8 AS MATERIALIZED ({_q418_t8_sql(d)}),
-       c0 AS MATERIALIZED (SELECT 8 AS z, x, y FROM t8)"""]
-    for k, l in enumerate((8, 7, 6, 5), start=1):
-        parts.append(f""",
-       f{k} AS MATERIALIZED (
-         SELECT x {d} 2 AS px, y {d} 2 AS py FROM c{k-1}
-         WHERE z = {l} GROUP BY x {d} 2, y {d} 2
-         HAVING count(*) = 4),
-       c{k} AS MATERIALIZED (
-         SELECT {l-1} AS z, px AS x, py AS y FROM f{k}
-         UNION ALL
-         SELECT c.z, c.x, c.y FROM c{k-1} c LEFT JOIN f{k} f
-           ON c.z = {l} AND c.x {d} 2 = f.px AND c.y {d} 2 = f.py
-         WHERE f.px IS NULL)""")
-    parts.append(f""",
-       fin AS MATERIALIZED (SELECT z, x, y FROM c4),
-       mv AS (SELECT CAST(count(*) AS BIGINT) AS min_viol
-              FROM (SELECT z, x {d} 2 AS px, y {d} 2 AS py FROM fin
-                    GROUP BY z, x {d} 2, y {d} 2
-                    HAVING count(*) = 4) t),
-       tot AS (SELECT CAST(sum(CASE z WHEN 8 THEN 1 WHEN 7 THEN 4
-                           WHEN 6 THEN 16 WHEN 5 THEN 64
-                           ELSE 256 END) AS BIGINT) AS total_leaf
-               FROM fin),
-       org AS (SELECT CAST(count(*) AS BIGINT) AS orig_tiles FROM t8)
-       SELECT CAST(z AS BIGINT) AS z,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(sum(CASE z WHEN 8 THEN 1 WHEN 7 THEN 4
-                       WHEN 6 THEN 16 WHEN 5 THEN 64 ELSE 256 END)
-                AS BIGINT) AS leaf_equiv,
-              org.orig_tiles, tot.total_leaf,
-              CAST(CASE WHEN tot.total_leaf = org.orig_tiles
-                   THEN 1 ELSE 0 END AS BIGINT) AS conserved,
-              mv.min_viol
-       FROM fin CROSS JOIN org CROSS JOIN tot CROSS JOIN mv
-       GROUP BY z, org.orig_tiles, tot.total_leaf, mv.min_viol""")
-    return "".join(parts)
-
-
-@query("q418_quadkey_compact", _q418_oracle_sql())
-def q418(spark, sf_dir):
-    """Quadkey tile-set compaction — H3's compact / S2's cell-union
-    normalization re-expressed on q404's quadkey grid: replace every
-    complete 4-sibling quad by its parent, recursively, so a tile
-    pyramid stores dense regions at coarse zoom and sparse ones at
-    leaf zoom (the index-size win that makes cell-cover joins cheap).
-    The fixture plants full z=7 quads, full z=6 16-blocks and lone
-    z=8 tiles (selectors on doc_id % 3 with div-derived block ids);
-    four bottom-up stages (8->7->6->5) each run ONE groupBy-HAVING
-    count(*)=4 over the bounded tile table + an anti-join keeping
-    partial quads — the engine iterates the stages as DataFrames,
-    the oracle unrolls the identical MATERIALIZED CTEs (q276).
-    Output pins BOTH invariants: conservation (sum over final cells
-    of 4^(8-z) equals the original leaf count) and MINIMALITY
-    (min_viol = 0: no four siblings survive at any level — the
-    compaction actually reached its fixed point)."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q418_docs")
-    d = "div"
-    cells = spark.sql(
-        "SELECT 8 AS z, x, y FROM ("
-        + _q418_t8_sql(d).replace("FROM documents", "FROM q418_docs")
-        + ") t8")
-    for l in (8, 7, 6, 5):
-        cells = cells.localCheckpoint(eager=False)
-        full = (cells.filter(F.col("z") == l)
-                .groupBy(F.expr(f"x {d} 2").alias("px"),
-                         F.expr(f"y {d} 2").alias("py"))
-                .agg(F.count("*").alias("nc"))
-                .filter("nc = 4").drop("nc"))
-        kept = cells.join(
-            full,
-            (F.col("z") == l) & (F.expr(f"x {d} 2") == F.col("px"))
-            & (F.expr(f"y {d} 2") == F.col("py")),
-            "left_anti")
-        cells = kept.unionByName(
-            full.select(F.lit(l - 1).alias("z"),
-                        F.col("px").alias("x"), F.col("py").alias("y")))
-    fin = cells.persist()
-    leafw = ("CASE z WHEN 8 THEN 1 WHEN 7 THEN 4 WHEN 6 THEN 16 "
-             "WHEN 5 THEN 64 ELSE 256 END")
-    mv = fin.groupBy("z", F.expr(f"x {d} 2"), F.expr(f"y {d} 2")).agg(
-        F.count("*").alias("nc")).filter("nc = 4").agg(
-        F.count("*").cast("long").alias("min_viol"))
-    tot = fin.agg(F.sum(F.expr(leafw)).cast("long").alias("total_leaf"))
-    org = spark.sql(
-        "SELECT CAST(count(*) AS BIGINT) AS orig_tiles FROM ("
-        + _q418_t8_sql(d).replace("FROM documents", "FROM q418_docs")
-        + ") t8")
-    per = fin.groupBy(F.col("z").cast("long").alias("z")).agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.sum(F.expr(leafw)).cast("long").alias("leaf_equiv"))
-    return (per.crossJoin(F.broadcast(org))
-            .crossJoin(F.broadcast(tot))
-            .crossJoin(F.broadcast(mv))
-            .selectExpr("z", "n_cells", "leaf_equiv", "orig_tiles",
-                        "total_leaf",
-                        "CAST(CASE WHEN total_leaf = orig_tiles"
-                        " THEN 1 ELSE 0 END AS BIGINT) AS conserved",
-                        "min_viol"))
-
-
-# --- OCC snapshot-isolation conflict detection (q419) --------------------------------
-
-
-def _q419_sql(divop: str) -> str:
-    es = ("CAST(floor(epoch(ts)) AS BIGINT)" if divop == "//"
-          else "unix_timestamp(ts)")
-    return f"""WITH op AS (SELECT (event_id {divop} 20) * 4
-                      + event_id % 4 AS txn,
-                    ((event_id {divop} 4) * 5
-                      + (event_id % 4) * ((event_id {divop} 20) % 2))
-                      % 16 AS wkey,
-                    {es} AS es
-             FROM events),
-       txn AS (SELECT txn, CAST(min(es) AS BIGINT) AS start_es,
-                     CAST(max(es) AS BIGINT) AS commit_es
-              FROM op GROUP BY txn),
-       wr AS (SELECT DISTINCT txn, wkey FROM op),
-       cf AS (SELECT b.txn AS txn,
-                     CAST(count(DISTINCT a.txn) AS BIGINT) AS n_confl
-              FROM wr a
-              JOIN wr b ON a.wkey = b.wkey
-               AND a.txn {divop} 4 = b.txn {divop} 4
-               AND a.txn <> b.txn
-              JOIN txn ta ON ta.txn = a.txn
-              JOIN txn tb ON tb.txn = b.txn
-              WHERE ta.commit_es >= tb.start_es
-                AND ta.commit_es <= tb.commit_es
-                AND ta.txn < tb.txn
-              GROUP BY b.txn)
-       SELECT CAST(t.txn % 40 AS BIGINT) AS cohort,
-              CAST(count(*) AS BIGINT) AS n_txns,
-              CAST(sum(CASE WHEN cf.n_confl IS NOT NULL
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_aborted,
-              CAST(sum(coalesce(cf.n_confl, 0)) AS BIGINT)
-                AS n_conflict_edges
-       FROM txn t LEFT JOIN cf ON t.txn = cf.txn
-       GROUP BY t.txn % 40"""
-
-
-@query("q419_occ_conflicts", _q419_sql("//"))
-def q419(spark, sf_dir):
-    """Optimistic-concurrency-control conflict detection under
-    snapshot isolation (first-committer-wins) — the transactional
-    audit behind the manifest layer's atomic-rename commits
-    (plans/manifest.py): four transactions INTERLEAVE per 20-event
-    block (txn = block*4 + event_id % 4 — a monotone-timestamp
-    stream makes consecutive-op txns temporally disjoint, so the
-    first cut had zero conflicts, caught live) over a 16-key write
-    domain with a block-parity term that varies collision density;
-    txn B aborts iff some EARLIER txn A (ta.txn <
-    tb.txn, the deterministic commit order) commits INSIDE B's
-    execution window (start_B <= commit_A <= commit_B) while their
-    write sets intersect — exactly the write-write FCW rule.
-    Shape: conflict candidates come from the (write-key, BLOCK)
-    equi-join — the block id IS the concurrency window (interleaved
-    txns share a block; cross-block txns are temporally ordered by
-    the monotone event stream), so candidates are blocks x C(4,2) x
-    shared keys, LINEAR where the key-only join was quadratic over
-    the 16-key domain (30 s -> sub-second at sf0.1, caught by the
-    bench top-up); the interval predicate still applies before the
-    distinct-count; timestamps are
-    epoch-second BIGINTs via the q317 cast-first contract.  Output
-    rolls up per txn-cohort: abort counts and conflict edges —
-    n_aborted <= n_txns and every aborted txn has >= 1 edge by
-    construction."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q419_events")
-    return spark.sql(_q419_sql("div").replace("FROM events",
-                                              "FROM q419_events"))
 
 
 # --- geodesic destination, Vincenty direct (q420) ------------------------------------
@@ -25384,6 +9982,7 @@ def _q420_rows():
         for k, la, lo, rt in _q420_rows()
     )
     + ") AS t(fid, lat2, lon2, rt_ok)",
+    kind="operator",
 )
 def q420(spark, sf_dir):
     """Geodesic DESTINATION (the Vincenty DIRECT problem, WGS84) —
@@ -25432,922 +10031,6 @@ def q420(spark, sf_dir):
         _dest, "fid long, lat2 double, lon2 double, rt_ok long")
 
 
-# --- temperature-sampling mixture allocation (q421) ----------------------------------
-
-_Q421_SOURCES = sorted(f"src{i}" for i in range(20))
-_Q421_BUDGET = 1_000_000
-
-
-def _q421_sql(divop: str) -> str:
-    piv = ", ".join(
-        f"max(CASE WHEN source = '{s}' THEN w END) AS w_{s}"
-        for s in _Q421_SOURCES
-    )
-    chain = f"w_{_Q421_SOURCES[0]}"
-    for s in _Q421_SOURCES[1:]:
-        chain = f"({chain} + w_{s})"
-    guard = (
-        "CASE WHEN (SELECT count(DISTINCT source) FROM documents) <> 20"
-        " THEN error('q421 source domain outgrew the pivot list')"
-        " ELSE 0 END"
-        if divop == "//" else "0"
-    )
-    return f"""WITH ing AS (SELECT source,
-                    CAST(sum(n_chars) AS BIGINT) AS tokens
-             FROM documents GROUP BY source),
-       ws AS (SELECT source, tokens,
-                     sqrt(CAST(tokens AS DOUBLE)) AS w,
-                     {guard} AS dom_guard
-              FROM ing),
-       tot AS (SELECT {chain} AS wsum
-               FROM (SELECT {piv} FROM ws) p),
-       qt AS (SELECT ws.source, ws.tokens, ws.dom_guard,
-                     {_Q421_BUDGET} * ws.w / tot.wsum AS quota
-              FROM ws CROSS JOIN tot),
-       base AS (SELECT source, tokens, dom_guard, quota,
-                       CAST(floor(quota) AS BIGINT) AS alloc0,
-                       quota - floor(quota) AS rem
-                FROM qt),
-       lo AS (SELECT CAST({_Q421_BUDGET} - sum(alloc0) AS BIGINT)
-                AS leftover FROM base),
-       rk AS (SELECT base.*, lo.leftover,
-                     row_number() OVER (ORDER BY rem DESC, source)
-                       AS rnk
-              FROM base CROSS JOIN lo)
-       SELECT source, tokens,
-              CAST(alloc0 + CASE WHEN rnk <= leftover THEN 1 ELSE 0 END
-                AS BIGINT) AS alloc,
-              CAST(sum(alloc0 + CASE WHEN rnk <= leftover THEN 1
-                       ELSE 0 END) OVER () AS BIGINT) AS total_alloc,
-              CAST(leftover AS BIGINT) AS leftover,
-              CAST(dom_guard AS BIGINT) AS dom_guard
-       FROM rk"""
-
-
-@query("q421_temperature_mixing", _q421_sql("//"))
-def q421(spark, sf_dir):
-    """Temperature-sampling mixture allocation (alpha = 0.5, the
-    UniMax/multilingual-LM source-balancing rule) — per-source token
-    budgets proportional to tokens^alpha, the op that decides what a
-    100-TB training epoch actually reads: weights are EXACT IEEE
-    sqrts of exact BIGINT token counts (the q355 contract); their
-    total is a FIXED left-to-right addition chain over the
-    lexicographically-pinned 20-source pivot (the q179 pivot-then-
-    fixed-order rule — an unordered float SUM would differ across
-    engines in the last ulp), guarded by an oracle error() if the
-    source domain ever outgrows the pivot list; the integer budget
-    splits by Hamilton largest-remainder (floor quotas + row_number
-    over remainders with source tiebreak — the q274/q355
-    apportionment idiom), so total_alloc == budget EXACTLY on every
-    row.  One combinable groupBy; everything after is 20 rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q421_docs")
-    return spark.sql(_q421_sql("div").replace("FROM documents",
-                                              "FROM q421_docs"))
-
-
-# --- HLL shard-merge distributivity proof (q422) -------------------------------------
-
-
-def _q422_sql(divop: str) -> str:
-    vt = "VARCHAR" if divop == "//" else "STRING"
-    h32 = ("CAST(CAST('0x' || substr(md5(url), 1, 8) AS UBIGINT)"
-           " AS BIGINT)" if divop == "//"
-           else "CAST(conv(substr(md5(url), 1, 8), 16, 10) AS BIGINT)")
-    return f"""WITH pages AS (SELECT doc_id % 25 AS host,
-                    'https://h' || CAST(doc_id % 25 AS {vt}) ||
-                    '.example.com/p' || CAST((doc_id * 13) % 40 AS {vt})
-                      AS url,
-                    (doc_id {divop} 200) % 4 AS shard
-             FROM documents),
-       h AS (SELECT DISTINCT host, shard, url FROM pages),
-       hh AS (SELECT host, shard, url,
-                     {h32} AS h32
-              FROM h),
-       rho AS (SELECT host, shard, h32 % 32 AS b,
-                      CASE WHEN h32 {divop} 32 = 0 THEN 28
-                           ELSE 28 - length(bin(h32 {divop} 32))
-                      END AS rho
-               FROM hh),
-       sreg AS (SELECT host, shard, b, max(rho) AS reg
-                FROM rho GROUP BY host, shard, b),
-       mreg AS (SELECT host, b, max(reg) AS reg
-                FROM sreg GROUP BY host, b),
-       ureg AS (SELECT host, b, max(rho) AS reg
-                FROM rho GROUP BY host, b),
-       cmp AS (SELECT m.host,
-                      CAST(sum(CASE WHEN m.reg = u.reg THEN 0 ELSE 1 END)
-                        AS BIGINT) AS reg_mismatch
-               FROM mreg m JOIN ureg u
-                 ON m.host = u.host AND m.b = u.b
-               GROUP BY m.host),
-       du AS (SELECT host, CAST(count(DISTINCT url) AS BIGINT)
-                AS n_distinct_union
-              FROM h GROUP BY host),
-       ds AS (SELECT host, CAST(sum(n) AS BIGINT) AS sum_shard_distincts
-              FROM (SELECT host, shard,
-                           count(DISTINCT url) AS n
-                    FROM h GROUP BY host, shard) t
-              GROUP BY host)
-       SELECT cmp.host, cmp.reg_mismatch,
-              du.n_distinct_union, ds.sum_shard_distincts,
-              CAST(CASE WHEN ds.sum_shard_distincts
-                             > du.n_distinct_union
-                   THEN 1 ELSE 0 END AS BIGINT) AS overlap_visible
-       FROM cmp JOIN du ON cmp.host = du.host
-       JOIN ds ON cmp.host = ds.host"""
-
-
-@query("q422_hll_merge_proof", _q422_sql("//"))
-def q422(spark, sf_dir):
-    """HyperLogLog shard-merge distributivity PROOF — the property
-    the whole 1000-executor sketch story rests on, demonstrated
-    end-to-end on q279's p=5 sketch: build per-(host, shard)
-    register tables from the 4-way doc-sharded url stream (the
-    shard id derives from doc_id div 200 BECAUSE the url fixture
-    repeats with period 200 — a %4 selector would be constant across
-    a url's occurrences, the gcd trap's fourth live catch, which
-    silently removed all cross-shard overlap), merge them by
-    register-wise MAX, and compare bit-for-bit against the sketch
-    built directly on the union — reg_mismatch = 0 on every host is
-    the distributivity certificate (max-of-max associativity
-    realized through the actual md5/rho/bucket pipeline, so any
-    implementation drift between the shard path and the union path
-    turns the column nonzero).  sum_shard_distincts >
-    n_distinct_union on every host (overlap_visible = 1) pins WHY
-    merging sketches is not adding estimates: shard counts
-    double-count the overlap, the merged sketch does not.  All
-    integer (the conv/UBIGINT md5 idiom + bin()-length rho); no
-    estimate division needed — the proof is on the registers
-    themselves."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q422_docs")
-    return spark.sql(_q422_sql("div").replace("FROM documents",
-                                              "FROM q422_docs"))
-
-
-# --- normalized cell covering of regions (q423) --------------------------------------
-
-
-def _q423_sql(engine: str) -> str:
-    d = "//" if engine == "duck" else "div"
-    rc = "range" if engine == "duck" else "id"
-    lvl = []
-    for l in (8, 7, 6, 5, 4):
-        s = 1 << (8 - l)
-        s2 = 2 * s
-        n = 256 // s
-        lvl.append(f"""SELECT r.rid, {l} AS z, x.{rc} AS cx, y.{rc} AS cy
-         FROM rects r, range(0, {n}) x, range(0, {n}) y
-         WHERE x.{rc} * {s} >= r.x0 AND (x.{rc} + 1) * {s} - 1 <= r.x1
-           AND y.{rc} * {s} >= r.y0 AND (y.{rc} + 1) * {s} - 1 <= r.y1
-           AND NOT ((x.{rc} {d} 2) * {s2} >= r.x0
-                AND ((x.{rc} {d} 2) + 1) * {s2} - 1 <= r.x1
-                AND (y.{rc} {d} 2) * {s2} >= r.y0
-                AND ((y.{rc} {d} 2) + 1) * {s2} - 1 <= r.y1)""")
-    body = " UNION ALL ".join(lvl)
-    return f"""WITH rects AS (SELECT CAST(n_nationkey AS BIGINT) AS rid,
-                    (n_nationkey * 37) % 230 AS x0,
-                    (n_nationkey * 53) % 230 AS y0,
-                    (n_nationkey * 37) % 230 + 5 + (n_nationkey * 7) % 15
-                      AS x1,
-                    (n_nationkey * 53) % 230 + 5 + (n_nationkey * 11) % 15
-                      AS y1
-             FROM nation),
-       cov AS ({body}),
-       mv AS (SELECT rid, CAST(count(*) AS BIGINT) AS min_viol
-              FROM (SELECT rid, z, cx {d} 2 AS px, cy {d} 2 AS py
-                    FROM cov GROUP BY rid, z, cx {d} 2, cy {d} 2
-                    HAVING count(*) = 4) t
-              GROUP BY rid)
-       SELECT cov.rid,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(sum(CASE cov.z WHEN 8 THEN 1 WHEN 7 THEN 4
-                       WHEN 6 THEN 16 WHEN 5 THEN 64 ELSE 256 END)
-                AS BIGINT) AS leaf_equiv,
-              CAST(max((r.x1 - r.x0 + 1) * (r.y1 - r.y0 + 1))
-                AS BIGINT) AS area_tiles,
-              CAST(CASE WHEN sum(CASE cov.z WHEN 8 THEN 1 WHEN 7 THEN 4
-                            WHEN 6 THEN 16 WHEN 5 THEN 64 ELSE 256 END)
-                             = max((r.x1 - r.x0 + 1) * (r.y1 - r.y0 + 1))
-                   THEN 1 ELSE 0 END AS BIGINT) AS tiles_exactly,
-              CAST(coalesce(max(mv.min_viol), 0) AS BIGINT) AS min_viol
-       FROM cov
-       JOIN rects r ON cov.rid = r.rid
-       LEFT JOIN mv ON cov.rid = mv.rid
-       GROUP BY cov.rid"""
-
-
-@query("q423_cell_covering", _q423_sql("duck"))
-def q423(spark, sf_dir):
-    """Normalized minimal cell COVERING of a region — the top-down
-    complement of q418's bottom-up compaction and the exact op the
-    spatial-join planner runs to turn a query window into an index
-    probe set (S2's RegionCoverer / the polygon cell-cover in
-    operators/spatial_join.py, here with PROOFS): a cell at level l
-    belongs to the covering iff it lies fully inside the rectangle
-    AND its parent does not — a CLOSED-FORM membership test, so the
-    whole multi-level covering enumerates as five level-unions of
-    range() grids filtered by integer inequalities, no recursion at
-    all.  Rectangles are z=8-aligned (6-20 tiles a side, strictly
-    under the level-3 cell size so five levels suffice).  Output
-    pins BOTH invariants per rectangle: the covering tiles the
-    region EXACTLY (sum of 4^(8-z) equals the tile area —
-    tiles_exactly = 1) and it is MINIMAL (no four siblings survive,
-    min_viol = 0).  The cover is 3-10x smaller than the leaf
-    enumeration — the index-probe saving that makes cover joins
-    cheap."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("q423_nation")
-    return spark.sql(_q423_sql("spark").replace("FROM nation",
-                                                "FROM q423_nation"))
-
-
-# --- spatial-clustering layout benefit (q424) ----------------------------------------
-
-
-def _q424_sql(divop: str) -> str:
-    mz = " + ".join(
-        f"(((tx {divop} {1 << j}) % 2) * {1 << (2 * j)})"
-        f" + (((ty {divop} {1 << j}) % 2) * {1 << (2 * j + 1)})"
-        for j in range(8)
-    )
-    return f"""WITH g AS (SELECT doc_id,
-                    CAST(floor((((doc_id * 9973) % 36000) / 100.0
-                          - 180.0 + 180.0) / 360.0 * 256.0) AS BIGINT)
-                      AS tx,
-                    CAST(floor((90.0 - (((doc_id * 7919) % 16000) / 100.0
-                          - 80.0)) / 180.0 * 256.0) AS BIGINT) AS ty
-             FROM documents),
-       m AS (SELECT doc_id, tx, ty, {mz} AS mkey FROM g),
-       rk AS (SELECT doc_id, tx, ty,
-                     (row_number() OVER (ORDER BY doc_id) - 1)
-                       {divop} 25 AS chunk_row,
-                     (row_number() OVER (ORDER BY mkey, doc_id) - 1)
-                       {divop} 25 AS chunk_morton
-              FROM m),
-       boxes AS (SELECT CAST(n_nationkey AS BIGINT) AS box,
-                        (n_nationkey * 29) % 192 AS bx0,
-                        (n_nationkey * 43) % 192 AS by0
-                 FROM nation WHERE n_nationkey < 8),
-       hit AS (SELECT b.box, r.doc_id, r.chunk_row, r.chunk_morton
-               FROM rk r JOIN boxes b
-                 ON r.tx >= b.bx0 AND r.tx <= b.bx0 + 48
-                AND r.ty >= b.by0 AND r.ty <= b.by0 + 48)
-       SELECT box,
-              CAST(count(*) AS BIGINT) AS n_matched,
-              CAST(count(DISTINCT chunk_row) AS BIGINT) AS chunks_row,
-              CAST(count(DISTINCT chunk_morton) AS BIGINT)
-                AS chunks_morton,
-              CAST(CASE WHEN count(DISTINCT chunk_morton)
-                             < count(DISTINCT chunk_row)
-                   THEN 1 ELSE 0 END AS BIGINT) AS morton_wins
-       FROM hit GROUP BY box"""
-
-
-@query("q424_clustering_benefit", _q424_sql("//"))
-def q424(spark, sf_dir):
-    """Spatial-clustering LAYOUT BENEFIT measurement — the number
-    that justifies q30/q89's Morton/Hilbert sorts and q384's
-    zonemaps: write the same point table in arrival (doc_id) order
-    and in Morton order, chunk both layouts into 25-row row-groups,
-    and count how many chunks eight 49x49-tile query windows touch
-    under each layout.  The Morton interleave is the q402-family
-    div/mod bit arithmetic (pure whole-stage codegen); ranks come
-    from two row_number windows (the one global sort the layout
-    decision is about); chunk membership is rank div 25 — exactly
-    the parquet row-group model the zonemap skipper prunes on.
-    chunks_morton << chunks_row on every box (morton_wins = 1) is
-    the clustering payoff made measurable: at 100 TB the same ratio
-    is the fraction of row-groups a bbox scan reads after a
-    Z-order OPTIMIZE."""
-    for t in ("documents", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"q424_{t}")
-    return spark.sql(_q424_sql("div")
-                     .replace("FROM documents", "FROM q424_documents")
-                     .replace("FROM nation", "FROM q424_nation"))
-
-
-# --- ANF neighborhood-function sketch (q425) -----------------------------------------
-
-
-def _q425_sql(divop: str) -> str:
-    vt = "VARCHAR" if divop == "//" else "STRING"
-    h32 = ("CAST(CAST('0x' || substr(md5('n' || CAST(host AS {vt})), 1, 8)"
-           " AS UBIGINT) AS BIGINT)" if divop == "//"
-           else "CAST(conv(substr(md5('n' || CAST(host AS {vt})), 1, 8),"
-                " 16, 10) AS BIGINT)").format(vt=vt)
-    rounds = []
-    for t in (1, 2, 3):
-        rounds.append(f""",
-       reg{t} AS (SELECT x.host, x.b, max(x.reg) AS reg
-              FROM (SELECT host, b, reg FROM reg{t-1}
-                    UNION ALL
-                    SELECT e.src AS host, r.b, r.reg
-                    FROM edges e JOIN reg{t-1} r ON e.dst = r.host) x
-              GROUP BY x.host, x.b),
-       rch{t} AS (SELECT DISTINCT x.host, x.n
-              FROM (SELECT host, n FROM rch{t-1}
-                    UNION ALL
-                    SELECT e.src, r.n
-                    FROM edges e JOIN rch{t-1} r ON e.dst = r.host) x)""")
-    return f"""WITH hosts AS (SELECT DISTINCT doc_id % 40 AS host
-                FROM documents),
-       edges AS (SELECT host AS src, (host + 3) % 40 AS dst FROM hosts
-                 UNION ALL SELECT host, (host * 5 + 2) % 40 FROM hosts
-                 UNION ALL SELECT host, (host * 7 + 13) % 40 FROM hosts),
-       h0 AS (SELECT host, {h32} AS h32 FROM hosts),
-       reg0 AS (SELECT host, h32 % 8 AS b,
-                       CASE WHEN h32 {divop} 8 = 0 THEN 30
-                            ELSE 30 - length(bin(h32 {divop} 8))
-                       END AS reg
-                FROM h0),
-       rch0 AS (SELECT host, host AS n FROM hosts){''.join(rounds)},
-       grid AS (SELECT hosts.host, r.{'range' if divop == '//' else 'id'}
-                  AS b
-                FROM hosts, range(0, 8) r),
-       fr AS (SELECT grid.host, grid.b, coalesce(reg3.reg, 0) AS reg
-              FROM grid LEFT JOIN reg3
-                ON reg3.host = grid.host AND reg3.b = grid.b),
-       agg AS (SELECT host,
-                      CAST(sum(CAST(1 AS BIGINT)
-                               << CAST(30 - reg AS INT)) AS BIGINT)
-                        AS harmonic_d,
-                      CAST(sum(CASE WHEN reg > 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS used_buckets
-               FROM fr GROUP BY host),
-       ex AS (SELECT r1.host,
-                     CAST(count(DISTINCT r1.n) AS BIGINT) AS n1,
-                     CAST(count(DISTINCT r2.n) AS BIGINT) AS n2,
-                     CAST(count(DISTINCT r3.n) AS BIGINT) AS n3
-              FROM rch1 r1
-              JOIN rch2 r2 ON r1.host = r2.host
-              JOIN rch3 r3 ON r1.host = r3.host
-              GROUP BY r1.host)
-       SELECT ex.host, ex.n1, ex.n2, ex.n3,
-              agg.harmonic_d, agg.used_buckets,
-              43676491745.50219 / CAST(agg.harmonic_d AS DOUBLE) AS anf_est3
-       FROM ex JOIN agg ON ex.host = agg.host"""
-
-
-@query("q425_anf_reachability", _q425_sql("//"))
-def q425(spark, sf_dir):
-    """ANF neighborhood-function estimation (Palmer et al.'s
-    approximate-neighborhood-function algorithm — the web-graph
-    reach/diameter statistic at 10^12-edge scale, where exact
-    closures are impossible): every node seeds an 8-bucket p=3 HLL
-    register from its own hash, then three rounds of register-wise
-    MAX-merge along in-edges (the q422-proved mergeable op IS the
-    BFS step — reg_t(v) = max(reg_{t-1}(v), max over successors),
-    one groupBy per round over the bounded register table).  The
-    EXACT 1/2/3-hop reachable-set sizes ride along from an unrolled
-    distinct closure over the same 40-host graph (exact is feasible
-    at fixture scale, which is the point of carrying it: the
-    estimate's error against n3 is VISIBLE per node), with the
-    single float division by the inlined alpha_8*m^2*2^30 constant
-    (0.7213/(1+1.079/m), Python-computed, verbatim both engines —
-    the q279 contract; the first cut inlined a constant off by
-    ~1000x and every estimate rounded to 0.0, caught live).  Wrong-scale closures never
-    materialize: the register table is |V| x 8 at every round
-    regardless of reach."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q425_docs")
-    return spark.sql(_q425_sql("div").replace("FROM documents",
-                                              "FROM q425_docs"))
-
-
-# --- Benford first-digit audit (q426) ------------------------------------------------
-
-_BENFORD_PPM = {
-    1: 301030, 2: 176091, 3: 124939, 4: 96910, 5: 79181,
-    6: 66947, 7: 57992, 8: 51153, 9: 45757,
-}
-
-
-def _q426_sql(divop: str) -> str:
-    vt = "VARCHAR" if divop == "//" else "STRING"
-    exp = " ".join(f"WHEN {d} THEN {p}" for d, p in _BENFORD_PPM.items())
-    return f"""WITH v AS (SELECT n_chars * (1 + (doc_id % 89)) AS val
-             FROM documents),
-       fd AS (SELECT CAST(substr(CAST(val AS {vt}), 1, 1) AS BIGINT)
-                AS digit
-              FROM v WHERE val > 0),
-       obs AS (SELECT digit, CAST(count(*) AS BIGINT) AS observed
-               FROM fd GROUP BY digit),
-       n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM fd)
-       SELECT obs.digit, obs.observed,
-              CAST(CASE obs.digit {exp} END AS BIGINT) AS benford_ppm,
-              CAST(abs(obs.observed * 1000000
-                       - n.n * (CASE obs.digit {exp} END))
-                AS BIGINT) AS dev_x1e6,
-              CAST(obs.observed * 1000000 AS DOUBLE)
-                / CAST(n.n * (CASE obs.digit {exp} END) AS DOUBLE)
-                AS obs_over_exp
-       FROM obs CROSS JOIN n"""
-
-
-@query("q426_benford_audit", _q426_sql("//"))
-def q426(spark, sf_dir):
-    """Benford first-digit audit — the classic fabricated-data /
-    quality screen applied to a derived magnitude column: first
-    digits come from the integer's string head (identical in both
-    engines, no logarithm), the Benford expectation log10(1+1/d) is
-    inlined as Python-computed parts-per-million constants
-    (transcendental constants are ALLOWED verbatim, transcendental
-    FUNCTIONS are not — the q73/q85 rule), and the per-digit
-    deviation |obs*1e6 - n*ppm| stays an exact BIGINT with one
-    obs/exp ratio division at the end.  The synthetic magnitudes are
-    deliberately NOT Benford-distributed — the audit's job is to
-    flag exactly that, and the deviation column does.  One corpus
-    scan to a 9-row digit table."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q426_docs")
-    return spark.sql(_q426_sql("div").replace("FROM documents",
-                                              "FROM q426_docs"))
-
-
-# --- embedding label-separability (q427) ---------------------------------------------
-
-
-def _q427_sql(engine: str) -> str:
-    d = "//" if engine == "duck" else "div"
-    if engine == "duck":
-        ex = ("SELECT vec_id, label, d.range - 1 AS dim, "
-              "CAST(floor(CAST(embedding[CAST(d.range AS INT)] AS DOUBLE)"
-              "*1000 + 0.5) AS BIGINT) AS v "
-              "FROM embeddings, range(1, 65) d")
-    else:
-        ex = ("SELECT vec_id, label, p AS dim, "
-              "CAST(floor(CAST(ev AS DOUBLE)*1000 + 0.5) AS BIGINT) AS v "
-              "FROM (SELECT vec_id, label, "
-              "posexplode(embedding) AS (p, ev) FROM embeddings) t")
-    return f"""WITH e AS ({ex}),
-       pc AS (SELECT label, dim,
-                     CAST(count(*) AS BIGINT) AS n,
-                     CAST(sum(v) AS BIGINT) AS s,
-                     CAST(sum(v*v) AS BIGINT) AS s2
-              FROM e GROUP BY label, dim),
-       gl AS (SELECT dim,
-                     CAST(sum(n) AS BIGINT) AS tn,
-                     CAST(sum(s) AS BIGINT) AS ts
-              FROM pc GROUP BY dim),
-       parts AS (SELECT pc.dim,
-                     CAST(sum(pc.n * pc.s2 - pc.s * pc.s) AS BIGINT)
-                       AS within_x,
-                     CAST(sum((pc.s * gl.tn - gl.ts * pc.n)
-                              * (pc.s * gl.tn - gl.ts * pc.n)
-                              {d} (pc.n * gl.tn)) AS BIGINT) AS betw_x
-              FROM pc JOIN gl ON pc.dim = gl.dim
-              GROUP BY pc.dim)
-       SELECT CAST(parts.dim {'//' if engine == 'duck' else 'div'} 8
-                AS BIGINT) AS dim_band,
-              CAST(sum(within_x) AS BIGINT) AS within_x,
-              CAST(sum(betw_x) AS BIGINT) AS between_x,
-              CAST(sum(betw_x) AS DOUBLE)
-                / CAST(sum(within_x) AS DOUBLE) AS fisher_ratio
-       FROM parts GROUP BY parts.dim {'//' if engine == 'duck' else 'div'} 8"""
-
-
-@query("q427_fisher_separability", _q427_sql("duck"))
-def q427(spark, sf_dir):
-    """Fisher label-separability of the embedding space — the
-    data-quality check an ANN/classifier pipeline runs before
-    trusting its labels (are classes separable AT ALL, and in which
-    dimensions?): per (label, dim), exact BIGINT moments (n, S, S2)
-    from ONE pass over the position-exploded per-mille-quantized
-    vectors (the q332 explode-don't-HOF contract); within-class
-    scatter n*S2 - S^2 and between-class scatter (S*TN - TS*n)^2 div
-    (n*TN) stay integer — EXPLICIT integer division ('//' vs 'div'),
-    because a bare '/' is float division in BOTH engines and the
-    float quotients' sum disagreed in the last units, caught live, summed into eight
-    8-dim bands with ONE float ratio division per band.  Shape: the
-    explode is |vectors| x 64 rows, one combinable groupBy to the
-    bounded (10-label x 64-dim) moment table, everything after is
-    640 rows."""
-    _t(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "q427_embeddings")
-    return spark.sql(_q427_sql("spark").replace("FROM embeddings",
-                                                "FROM q427_embeddings"))
-
-
-# --- Huffman dictionary-code planning (q428) -----------------------------------------
-
-_Q428_W = ("SELECT CAST(substr(source, 4) AS BIGINT) AS root_id, source,"
-           " CAST(sum(n_chars * (1 + doc_id % 16))"
-           " * (CAST(1 AS BIGINT) << CAST(CAST(substr(source, 4)"
-           " AS BIGINT) % 6 AS INT)) AS BIGINT) AS weight"
-           " FROM documents GROUP BY source")
-
-
-def _q428_oracle_sql() -> str:
-    parts = [f"""WITH w AS MATERIALIZED ({_Q428_W}),
-       roots0 AS MATERIALIZED (SELECT root_id, weight FROM w),
-       memb0 AS MATERIALIZED (SELECT source AS leaf, root_id,
-                                     0 AS depth FROM w)"""]
-    for t in range(1, 20):
-        parts.append(f""",
-       pick{t} AS MATERIALIZED (
-         SELECT root_id, weight FROM roots{t-1}
-         ORDER BY weight, root_id LIMIT 2),
-       roots{t} AS MATERIALIZED (
-         SELECT r.root_id, r.weight FROM roots{t-1} r
-         LEFT JOIN pick{t} p ON r.root_id = p.root_id
-         WHERE p.root_id IS NULL
-         UNION ALL
-         SELECT {10000 + t},
-                (SELECT CAST(sum(weight) AS BIGINT) FROM pick{t})),
-       memb{t} AS MATERIALIZED (
-         SELECT m.leaf,
-                CASE WHEN p.root_id IS NOT NULL
-                     THEN {10000 + t} ELSE m.root_id END AS root_id,
-                m.depth + CASE WHEN p.root_id IS NOT NULL
-                          THEN 1 ELSE 0 END AS depth
-         FROM memb{t-1} m
-         LEFT JOIN pick{t} p ON m.root_id = p.root_id)""")
-    parts.append(""",
-       fin AS MATERIALIZED (
-         SELECT m.leaf AS source, w.weight,
-                CAST(m.depth AS BIGINT) AS code_len
-         FROM memb19 m JOIN w ON m.leaf = w.source),
-       mx AS (SELECT CAST(max(code_len) AS BIGINT) AS l FROM fin),
-       kr AS (SELECT CAST(sum(CAST(1 AS BIGINT)
-                    << CAST(mx.l - fin.code_len AS INT)) AS BIGINT)
-                AS ksum, CAST(max(mx.l) AS BIGINT) AS l
-              FROM fin CROSS JOIN mx),
-       tb AS (SELECT CAST(sum(weight * code_len) AS BIGINT)
-                AS total_bits,
-                     CAST(sum(weight) AS BIGINT) AS total_w
-              FROM fin)
-       SELECT fin.source, fin.weight, fin.code_len,
-              CAST(fin.weight * fin.code_len AS BIGINT) AS wbits,
-              tb.total_bits,
-              CAST(CASE WHEN kr.ksum = (CAST(1 AS BIGINT)
-                   << CAST(kr.l AS INT)) THEN 1 ELSE 0 END AS BIGINT)
-                AS kraft_exact,
-              CAST(CASE WHEN tb.total_bits <= 5 * tb.total_w
-                   THEN 1 ELSE 0 END AS BIGINT) AS beats_fixed5
-       FROM fin CROSS JOIN kr CROSS JOIN tb""")
-    return "".join(parts)
-
-
-@query("q428_huffman_dictionary", _q428_oracle_sql())
-def q428(spark, sf_dir):
-    """Huffman code construction over the source-frequency table —
-    the optimal-prefix-code bound behind the q394 encoding selector
-    and q269's gamma-code accounting (what IS the best dictionary
-    code for this distribution?): 19 deterministic merge rounds of
-    the two lightest roots ((weight, root_id) tie order pinned,
-    merged ids disjoint at 10000+stage), tracked as a leaf ->
-    current-root membership table whose depth increments when its
-    root merges.  The greedy is inherently sequential over the
-    DOMAIN-bounded 20-symbol table — the engine collects it once
-    (loud assert) and replays exactly in driver Python (the q417
-    gate pattern); the oracle unrolls all 19 MATERIALIZED stages.
-    PROOFS in the output: the Kraft EQUALITY sum 2^(L-len) == 2^L
-    holds exactly (a Huffman code is complete, not merely
-    prefix-free), and total_bits <= the flat 5-bit competitor.
-    Weights spread ~250x (the q413 replication term times a
-    per-source power-of-two skew) so code lengths span several
-    levels instead of the near-uniform 4-5."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q428_docs")
-    rows = spark.sql(
-        _Q428_W.replace("FROM documents", "FROM q428_docs")).collect()
-    assert len(rows) <= 64, "q428 symbol table outgrew its bound"
-    roots = {int(r["root_id"]): int(r["weight"]) for r in rows}
-    leaf_root = {r["source"]: int(r["root_id"]) for r in rows}
-    depth = {r["source"]: 0 for r in rows}
-    for t in range(1, len(rows)):
-        (a, wa), (b, wb) = sorted(roots.items(),
-                                  key=lambda kv: (kv[1], kv[0]))[:2]
-        nid = 10000 + t
-        for leaf, rid in list(leaf_root.items()):
-            if rid in (a, b):
-                leaf_root[leaf] = nid
-                depth[leaf] += 1
-        del roots[a], roots[b]
-        roots[nid] = wa + wb
-    weights = {r["source"]: int(r["weight"]) for r in rows}
-    mx = max(depth.values())
-    ksum = sum(1 << (mx - d) for d in depth.values())
-    total_bits = sum(weights[s] * depth[s] for s in weights)
-    total_w = sum(weights.values())
-    out = [(s, weights[s], depth[s], weights[s] * depth[s], total_bits,
-            1 if ksum == (1 << mx) else 0,
-            1 if total_bits <= 5 * total_w else 0)
-           for s in sorted(weights)]
-    return spark.createDataFrame(
-        out, "source string, weight long, code_len long, wbits long,"
-             " total_bits long, kraft_exact long, beats_fixed5 long")
-
-
-# --- grouping-sets corpus report (q429) ----------------------------------------------
-
-_Q429_SQL = """SELECT coalesce(lang, '(all)') AS lang,
-              coalesce(source, '(all)') AS source,
-              CAST(GROUPING(lang) * 2 + GROUPING(source) AS BIGINT)
-                AS lvl,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(n_chars) AS BIGINT) AS n_chars
-       FROM documents
-       GROUP BY GROUPING SETS ((lang, source), (lang), (source), ())"""
-
-
-@query("q429_grouping_sets_report", _Q429_SQL)
-def q429(spark, sf_dir):
-    """Multi-level corpus report in ONE pass via GROUPING SETS — the
-    SQL-surface feature none of the other 428 queries exercise
-    (every prior rollup re-aggregated per level or exploded level
-    keys a la q386): (lang, source) detail, per-lang and per-source
-    subtotals, and the grand total all come from a single scan with
-    Catalyst's Expand operator, and GROUPING() disambiguates
-    subtotal rows from a real lang named '(all)' — the level id
-    GROUPING(lang)*2 + GROUPING(source) is identical in both
-    engines.  At 100 TB this is the difference between one shuffle
-    and four: Expand emits each row once per grouping set BEFORE the
-    aggregation, so partial aggregation still applies per set.
-    Identical SQL text runs on both engines."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q429_docs")
-    return spark.sql(_Q429_SQL.replace("FROM documents",
-                                       "FROM q429_docs"))
-
-
-# --- RANGE-frame rolling load (q430) -------------------------------------------------
-
-
-def _q430_sql(engine: str) -> str:
-    es = ("CAST(floor(epoch(ts)) AS BIGINT)" if engine == "duck"
-          else "unix_timestamp(ts)")
-    return f"""WITH ev AS (SELECT user_id % 20 AS shard, {es} AS es
-             FROM events),
-       roll AS (SELECT shard, es,
-                       CAST(count(*) OVER (PARTITION BY shard
-                         ORDER BY es
-                         RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW)
-                         AS BIGINT) AS load_1h
-                FROM ev)
-       SELECT shard,
-              CAST(count(*) AS BIGINT) AS n_events,
-              CAST(max(load_1h) AS BIGINT) AS peak_1h,
-              CAST(sum(CASE WHEN load_1h > 3 THEN 1 ELSE 0 END)
-                AS BIGINT) AS over_3,
-              CAST(sum(CASE WHEN load_1h > 8 THEN 1 ELSE 0 END)
-                AS BIGINT) AS over_8
-       FROM roll GROUP BY shard"""
-
-
-@query("q430_range_frame_load", _q430_sql("duck"))
-def q430(spark, sf_dir):
-    """Rolling 1-hour load per shard via a value-based RANGE window
-    frame — the other SQL-surface feature the suite never exercises
-    (q335's sliding distinct used fixed calendar buckets; a RANGE
-    frame is the CORRECT tool for irregular event times: the frame
-    is 'all events within the past 3599 seconds', not 'the past N
-    rows'): peak concurrent load and a two-threshold breach profile per
-    shard from ONE windowed pass (the first cut's single threshold
-    sat above every peak and the column was constant 0, caught
-    live), with RANGE-frame tie semantics
-    (equal timestamps share a frame) identical in both engines.
-    Epoch seconds per the q317 cast-first contract.  At scale the
-    partition-keyed sort is the one shuffle; the frame scan is
-    linear per shard."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q430_events")
-    return spark.sql(_q430_sql("spark").replace("FROM events",
-                                                "FROM q430_events"))
-
-
-# --- LSH S-curve parameter audit (q431) ----------------------------------------------
-
-_Q431_CONFIGS = [(16, 1), (8, 2), (4, 4), (2, 8)]
-
-
-def _q431_sql(engine: str) -> str:
-    vt = "VARCHAR" if engine == "duck" else "STRING"
-    rc = "range" if engine == "duck" else "id"
-    d = "//" if engine == "duck" else "div"
-    h64 = (("CAST(CAST('0x' || substr(md5({x}), 1, 15) AS UBIGINT)"
-            " AS BIGINT)") if engine == "duck"
-           else "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)")
-    sh_a = h64.format(x=f"'s' || CAST(base AS {vt}) || ':' || "
-                        f"CAST(j.{rc} AS {vt})")
-    sh_b = h64.format(x=f"'t' || CAST(base AS {vt}) || ':' || "
-                        f"CAST(j.{rc} AS {vt})")
-    mh = h64.format(x=f"'m' || CAST(t.{rc} AS {vt}) || ':' || "
-                      f"CAST(sh AS {vt})")
-    # analytic 1 - (1 - s^r)^b as explicit multiplication chains
-    ana = []
-    for b, r in _Q431_CONFIGS:
-        sr = " * ".join(["s"] * r)
-        one_m = f"(1.0 - {sr})"
-        pb = " * ".join([one_m] * b)
-        ana.append(f"SELECT {b} AS b, {r} AS r, cls, s,"
-                   f" 1.0 - {pb} AS analytic FROM cls_s")
-    ana_sql = " UNION ALL ".join(ana)
-    return f"""WITH pair AS (SELECT doc_id AS base,
-                      8 + ((doc_id {d} 10) % 3) * 5 AS k
-               FROM documents WHERE doc_id % 10 = 0),
-       sh AS (SELECT base, k, 'a' AS side, {sh_a} AS sh
-              FROM pair, range(0, 20) j
-              UNION ALL
-              SELECT base, k, 'b',
-                     CASE WHEN j.{rc} < k THEN {sh_a} ELSE {sh_b} END
-              FROM pair, range(0, 20) j),
-       mh AS (SELECT base, k, side, t.{rc} AS t, min({mh}) AS mh
-              FROM sh, range(0, 16) t
-              GROUP BY base, k, side, t.{rc}),
-       eqpos AS (SELECT a.base, a.k, a.t,
-                        CASE WHEN a.mh = b.mh THEN 1 ELSE 0 END AS eq
-                 FROM mh a JOIN mh b
-                   ON a.base = b.base AND a.t = b.t
-                  AND a.side = 'a' AND b.side = 'b'),
-       bandhit AS (SELECT base, k, c.b, c.r, e.t {d} c.r AS band,
-                          CAST(min(eq) AS BIGINT) AS all_eq
-                   FROM eqpos e CROSS JOIN
-                        (VALUES (16, 1), (8, 2), (4, 4), (2, 8))
-                          c(b, r)
-                   GROUP BY base, k, c.b, c.r, e.t {d} c.r),
-       coll AS (SELECT base, k, b, r,
-                       CAST(max(all_eq) AS BIGINT) AS collide
-                FROM bandhit GROUP BY base, k, b, r),
-       emp AS (SELECT k AS cls, b, r,
-                      CAST(count(*) AS BIGINT) AS n_pairs,
-                      CAST(sum(collide) AS BIGINT) AS n_collide
-               FROM coll GROUP BY k, b, r),
-       cls_s AS (SELECT DISTINCT k AS cls,
-                        CAST(k AS DOUBLE) / CAST(40 - k AS DOUBLE) AS s
-                 FROM pair),
-       ana AS ({ana_sql})
-       SELECT emp.cls, CAST(emp.b AS BIGINT) AS b,
-              CAST(emp.r AS BIGINT) AS r,
-              emp.n_pairs, emp.n_collide,
-              CAST(emp.n_collide AS DOUBLE)
-                / CAST(emp.n_pairs AS DOUBLE) AS empirical,
-              ana.s AS jaccard, ana.analytic
-       FROM emp JOIN ana
-         ON emp.cls = ana.cls AND emp.b = ana.b AND emp.r = ana.r"""
-
-
-@query("q431_lsh_s_curve", _q431_sql("duck"))
-def q431(spark, sf_dir):
-    """LSH S-curve parameter audit — the (bands, rows) design
-    decision behind q18/q250's near-dup pipeline made MEASURABLE:
-    planted pairs at three exact Jaccard levels (shared-shingle
-    construction k/(40-k) in {0.25, 0.48, 0.82}) run through a real
-    16-hash MinHash signature (md5 idiom, one min-groupBy over the
-    exploded (doc, shingle, hash) grid) and all four b x r splits of
-    the SAME signature at once — band collision = min(eq) over the
-    band's positions, pair candidacy = max over bands — while the
-    ANALYTIC curve 1 - (1 - s^r)^b is evaluated as explicit
-    multiplication chains (integer exponents unrolled, no pow(),
-    identical expression trees).  Empirical and analytic rates sit
-    side by side per (class, config): the audit SHOWS (16,1) fishing
-    everything, (2,8) passing only the 0.82 class — why banded LSH
-    has a threshold knee at (1/b)^(1/r).  Everything is bounded:
-    |pairs| x 16 signatures, x4 configs."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q431_docs")
-    return spark.sql(_q431_sql("spark").replace("FROM documents",
-                                                "FROM q431_docs"))
-
-
-# --- hex k-ring aggregation (q432) ---------------------------------------------------
-
-
-def _q432_sql(engine: str) -> str:
-    d = "//" if engine == "duck" else "div"
-    rc = "range" if engine == "duck" else "id"
-    return f"""WITH pts AS ({POINTS_SQL}),
-       ax AS (SELECT lon * 0.11547005383792515
-                       - lat * 0.06666666666666667 AS qf,
-                     lat * 0.13333333333333333 AS rf
-              FROM pts),
-       cz AS (SELECT qf, rf, -qf - rf AS zf FROM ax),
-       rd AS (SELECT qf, rf, zf,
-                     CAST(floor(qf + 0.5) AS BIGINT) AS rx,
-                     CAST(floor(rf + 0.5) AS BIGINT) AS ry,
-                     CAST(floor(zf + 0.5) AS BIGINT) AS rz
-              FROM cz),
-       dd AS (SELECT rx, ry, rz,
-                     abs(rx - qf) AS dx, abs(ry - rf) AS dy,
-                     abs(rz - zf) AS dz
-              FROM rd),
-       fx AS (SELECT CASE WHEN dx > dy AND dx > dz THEN -ry - rz
-                          ELSE rx END AS hq,
-                     CASE WHEN NOT (dx > dy AND dx > dz) AND dy > dz
-                          THEN -rx - rz ELSE ry END AS hr
-              FROM dd),
-       cells AS (SELECT CAST(hq AS BIGINT) AS hq,
-                        CAST(hr AS BIGINT) AS hr,
-                        CAST(count(*) AS BIGINT) AS n
-                 FROM fx GROUP BY hq, hr),
-       anchors AS (SELECT CAST(n_nationkey AS BIGINT) AS anchor,
-                          (n_nationkey * 5) % 21 - 10 AS aq,
-                          (n_nationkey * 7) % 13 - 6 AS ar
-                   FROM nation WHERE n_nationkey < 7),
-       offs AS (SELECT x.{rc} - 3 AS dq, y.{rc} - 3 AS dr,
-                       CAST((abs(x.{rc} - 3) + abs(y.{rc} - 3)
-                             + abs(x.{rc} - 3 + y.{rc} - 3)) {d} 2
-                         AS BIGINT) AS ring
-                FROM range(0, 7) x, range(0, 7) y
-                WHERE (abs(x.{rc} - 3) + abs(y.{rc} - 3)
-                       + abs(x.{rc} - 3 + y.{rc} - 3)) {d} 2 <= 3),
-       kr AS (SELECT a.anchor, o.ring,
-                     a.aq + o.dq AS hq, a.ar + o.dr AS hr
-              FROM anchors a CROSS JOIN offs o)
-       SELECT kr.anchor, kr.ring,
-              CAST(count(c.hq) AS BIGINT) AS n_cells_occupied,
-              CAST(sum(coalesce(c.n, 0)) AS BIGINT) AS n_points,
-              CAST(CASE kr.ring WHEN 0 THEN 1
-                   ELSE 6 * kr.ring END AS BIGINT) AS ring_capacity,
-              CAST(CASE WHEN count(c.hq) <=
-                        (CASE kr.ring WHEN 0 THEN 1
-                         ELSE 6 * kr.ring END)
-                   THEN 1 ELSE 0 END AS BIGINT) AS within_capacity
-       FROM kr LEFT JOIN cells c
-         ON kr.hq = c.hq AND kr.hr = c.hr
-       GROUP BY kr.anchor, kr.ring"""
-
-
-@query("q432_hex_kring", _q432_sql("duck"))
-def q432(spark, sf_dir):
-    """Hex k-ring aggregation — H3's kRing/gridDisk API on q401's
-    TRUE hexagonal grid (the neighbor primitive behind hex kNN and
-    hex focal ops; q46's cell rings did this on squares where ring
-    sizes are 8r — on hexes they are exactly 6r, the uniform-
-    adjacency property that is the reason H3 chose hexagons): ring
-    offsets enumerate from a 7x7 axial window filtered by the exact
-    cube ring distance (|dq|+|dr|+|dq+dr|)/2 <= 3 (ring sizes 1, 6,
-    12, 18 by construction — the within_capacity column PROVES no
-    ring ever exceeds 6r occupied cells), anchors join the binned
-    cell table by plain integer equality — a broadcast of 175
-    (anchor, offset) rows against the grid-bounded cell table, the
-    same shape a hex kNN expands rings with.  The binning pipeline
-    is q401's shared-verbatim cube rounding."""
-    for t in ("documents", "nation"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"q432_{t}")
-    return spark.sql(_q432_sql("spark")
-                     .replace("FROM documents", "FROM q432_documents")
-                     .replace("FROM nation", "FROM q432_nation"))
-
-
-# --- near-dup transitivity audit (q433) ----------------------------------------------
-
-
-def _q433_sql(engine: str) -> str:
-    vt = "VARCHAR" if engine == "duck" else "STRING"
-    rc = "range" if engine == "duck" else "id"
-    return f"""WITH tri AS (SELECT doc_id AS base,
-                     CASE WHEN doc_id % 10 = 3 THEN 5 ELSE 2 END AS st
-              FROM documents WHERE doc_id % 10 IN (3, 7)),
-       sh AS (SELECT base, st, m.m,
-                     'x' || CAST(base AS {vt}) || ':'
-                         || CAST(j.{rc} + m.m * st AS {vt}) AS sh
-              FROM tri, range(0, 20) j,
-                   (VALUES (0), (1), (2)) m(m)),
-       pw AS (SELECT a.base, a.st, a.m AS ma, b.m AS mb,
-                     CAST(count(*) AS BIGINT) AS inter
-              FROM sh a JOIN sh b
-                ON a.base = b.base AND a.sh = b.sh AND a.m < b.m
-              GROUP BY a.base, a.st, a.m, b.m),
-       e AS (SELECT base, st, ma, mb, inter,
-                    CAST(40 - inter AS BIGINT) AS un,
-                    CAST(CASE WHEN 2 * inter >= 40 - inter
-                         THEN 1 ELSE 0 END AS BIGINT) AS edge
-             FROM pw),
-       flags AS (SELECT base, st,
-                        max(CASE WHEN ma = 0 AND mb = 1
-                            THEN edge END) AS e_ab,
-                        max(CASE WHEN ma = 1 AND mb = 2
-                            THEN edge END) AS e_bc,
-                        max(CASE WHEN ma = 0 AND mb = 2
-                            THEN edge END) AS e_ac,
-                        max(CASE WHEN ma = 0 AND mb = 2
-                            THEN inter END) AS inter_ac
-                 FROM e GROUP BY base, st)
-       SELECT CAST(st AS BIGINT) AS step,
-              CAST(count(*) AS BIGINT) AS n_trios,
-              CAST(sum(e_ab * e_bc * e_ac) AS BIGINT)
-                AS closed_triangles,
-              CAST(sum(e_ab * e_bc * (1 - e_ac)) AS BIGINT)
-                AS open_wedges,
-              CAST(sum(e_ab + e_bc + e_ac) AS BIGINT) AS n_edges,
-              CAST(sum(inter_ac) AS BIGINT) AS inter_ac_total
-       FROM flags GROUP BY st"""
-
-
-@query("q433_dedup_transitivity", _q433_sql("duck"))
-def q433(spark, sf_dir):
-    """Near-dup TRANSITIVITY audit — the measured reason the dedup
-    stack (q94) clusters by connected components and not by cliques:
-    Jaccard similarity is not transitive, so A~B~C chains with
-    A!~C are REAL.  Planted trios share shingle windows offset by a
-    per-class step (step 2: pairwise overlaps 18/22 = 0.82 and
-    16/24 = 0.67, ALL above theta = 1/3 cross-multiplied as
-    2*inter >= union — closed triangles; step 5: 15/25 = 0.6
-    adjacent but 10/30 = 0.33 for the endpoints — open wedges,
-    every one of them), with exact intersections from ONE shingle
-    equi-join over the bounded trio tables.  closed_triangles +
-    open_wedges partitions the A-B-C wedges exactly; a
-    clique-based deduper would SPLIT every step-5 trio that CC
-    correctly merges, and open_wedges counts precisely those."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q433_docs")
-    return spark.sql(_q433_sql("spark").replace("FROM documents",
-                                                "FROM q433_docs"))
-
-
 # --- polar stereographic roundtrip (q434) --------------------------------------------
 
 
@@ -26357,6 +10040,7 @@ def q433(spark, sf_dir):
             CAST((n_nationkey*67)%360 AS DOUBLE) - 180.0 + 0.31 AS lon,
             CAST(55 + (n_nationkey*41)%34 AS DOUBLE) + 0.17 AS lat
        FROM nation""",
+    kind="operator",
 )
 def q434(spark, sf_dir):
     """WGS84 -> north polar stereographic (EPSG 9829 variant B,
@@ -26392,812 +10076,6 @@ def q434(spark, sf_dir):
     )
 
 
-# --- MERGE / CDC apply (q435) --------------------------------------------------------
-
-
-def _q435_sql(divop: str) -> str:
-    return f"""WITH base AS (SELECT doc_id AS k, n_chars AS v
-               FROM documents),
-       chg AS (SELECT doc_id AS k, 1 AS version, 'U' AS op,
-                      n_chars + 100 AS v
-               FROM documents WHERE doc_id % 7 = 2
-               UNION ALL
-               SELECT doc_id, 2, 'U', n_chars + 200
-               FROM documents WHERE doc_id % 14 = 2
-               UNION ALL
-               SELECT doc_id, 1, 'D', CAST(NULL AS BIGINT)
-               FROM documents WHERE doc_id % 7 = 3
-               UNION ALL
-               SELECT doc_id + 1000000, 1, 'I', n_chars
-               FROM documents WHERE doc_id % 7 = 4),
-       last AS (SELECT k, max(version) AS mv FROM chg GROUP BY k),
-       eff AS (SELECT c.k, c.op, c.v
-               FROM chg c JOIN last l
-                 ON c.k = l.k AND c.version = l.mv),
-       fin AS (SELECT b.k, coalesce(e.v, b.v) AS v
-               FROM base b LEFT JOIN eff e ON b.k = e.k
-               WHERE e.op IS NULL OR e.op = 'U'
-               UNION ALL
-               SELECT e.k, e.v FROM eff e
-               LEFT JOIN base b ON e.k = b.k
-               WHERE e.op = 'I' AND b.k IS NULL),
-       cls AS (SELECT CAST(count(*) AS BIGINT) AS n_base FROM base),
-       stats AS (SELECT
-            CAST(sum(CASE WHEN op = 'D' THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_deleted,
-            CAST(sum(CASE WHEN op = 'I' THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_inserted,
-            CAST(sum(CASE WHEN op = 'U' THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_updated
-          FROM eff),
-       fz AS (SELECT CAST(count(*) AS BIGINT) AS n_final,
-                     CAST(sum(v) AS BIGINT) AS sum_v,
-                     CAST(sum(CASE WHEN k {divop} 1000000 = 1
-                              THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_new_keys
-              FROM fin)
-       SELECT cls.n_base, stats.n_deleted, stats.n_inserted,
-              stats.n_updated, fz.n_final, fz.sum_v, fz.n_new_keys,
-              CAST(CASE WHEN fz.n_final = cls.n_base - stats.n_deleted
-                                          + stats.n_inserted
-                   THEN 1 ELSE 0 END AS BIGINT) AS conserved,
-              CAST(CASE WHEN fz.n_new_keys = stats.n_inserted
-                   THEN 1 ELSE 0 END AS BIGINT) AS inserts_landed
-       FROM cls CROSS JOIN stats CROSS JOIN fz"""
-
-
-@query("q435_merge_apply", _q435_sql("//"))
-def q435(spark, sf_dir):
-    """MERGE INTO / CDC-apply semantics — the Delta/Iceberg upsert
-    op the manifest layer (plans/manifest.py) commits but never
-    APPLIES relationally until now: a change stream with multiple
-    versions per key collapses to its LAST writer (max-version join
-    — keys with two updates take the +200 one, the LWW rule), then
-    one pass produces the merged table: base rows not touched or
-    updated (LEFT JOIN + coalesce), minus deletes (op filter), plus
-    inserts that verifiably did not collide with base keys (the
-    anti-join guard).  Conservation is EMITTED, not assumed:
-    n_final == n_base - n_deleted + n_inserted and every insert
-    landed under a new key.  Shape: one groupBy for LWW, two hash
-    joins on the key — at 100 TB this is the standard
-    shuffle-on-key merge a lakehouse executes per commit."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q435_docs")
-    return spark.sql(_q435_sql("div").replace("FROM documents",
-                                              "FROM q435_docs"))
-
-
-# --- scatter-gather top-k correctness (q436) -----------------------------------------
-
-
-def _q436_sql(engine: str) -> str:
-    h = ("CAST(CAST('0x' || substr(md5('sg' || CAST(doc_id AS VARCHAR)),"
-         " 1, 8) AS UBIGINT) AS BIGINT)" if engine == "duck"
-         else "CAST(conv(substr(md5('sg' || CAST(doc_id AS STRING)),"
-              " 1, 8), 16, 10) AS BIGINT)")
-    return f"""WITH it AS (SELECT doc_id, doc_id % 8 AS shard,
-                    {h} + CASE WHEN doc_id IN (16, 116, 216, 316, 416)
-                          THEN 10000000000 ELSE 0 END AS score
-             FROM documents),
-       g AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC,
-                    doc_id) AS gr
-             FROM it),
-       s AS (SELECT doc_id, shard, row_number() OVER (PARTITION BY
-                    shard ORDER BY score DESC, doc_id) AS sr
-             FROM it),
-       m5 AS (SELECT it.doc_id,
-                     row_number() OVER (ORDER BY it.score DESC,
-                       it.doc_id) AS mr
-              FROM it JOIN s ON it.doc_id = s.doc_id AND s.sr <= 5),
-       m2 AS (SELECT it.doc_id,
-                     row_number() OVER (ORDER BY it.score DESC,
-                       it.doc_id) AS mr
-              FROM it JOIN s ON it.doc_id = s.doc_id AND s.sr <= 2),
-       chk AS (SELECT
-            CAST(sum(CASE WHEN m5.doc_id IS NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS missed_fetch5,
-            CAST(sum(CASE WHEN m2.doc_id IS NULL THEN 1 ELSE 0 END)
-              AS BIGINT) AS missed_fetch2
-          FROM g
-          LEFT JOIN m5 ON g.doc_id = m5.doc_id AND m5.mr <= 5
-          LEFT JOIN m2 ON g.doc_id = m2.doc_id AND m2.mr <= 5
-          WHERE g.gr <= 5)
-       SELECT CAST(5 AS BIGINT) AS k,
-              missed_fetch5, missed_fetch2,
-              CAST(CASE WHEN missed_fetch5 = 0 THEN 1 ELSE 0 END
-                AS BIGINT) AS fetch_k_sound,
-              CAST(CASE WHEN missed_fetch2 > 0 THEN 1 ELSE 0 END
-                AS BIGINT) AS underfetch_unsound
-       FROM chk"""
-
-
-@query("q436_scatter_gather_topk", _q436_sql("duck"))
-def q436(spark, sf_dir):
-    """Scatter-gather top-k correctness — the lemma every sharded
-    search tier (q310/q361's indexes) relies on, PROVED and its
-    converse EXHIBITED in one query: fetching k results from EVERY
-    shard and merging always contains the global top-k (each global
-    winner is within its own shard's top-k — missed_fetch5 = 0,
-    fetch_k_sound = 1), while under-fetching (2 per shard) provably
-    CAN miss — the fixture plants three of the five global winners
-    in the same shard (fixed bonus ids 16/216/416 share shard 0),
-    so the shard's 2-slot budget drops one and missed_fetch2 > 0 at
-    every scale.  One scan, one global and one per-shard
-    row_number, two merge windows over <= 8k rows — at 100 TB the
-    per-shard top-k is the map-side heap, the merge a 1-task
-    gather."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q436_docs")
-    return spark.sql(_q436_sql("spark").replace("FROM documents",
-                                                "FROM q436_docs"))
-
-
-# --- code-switching detection (q437) -------------------------------------------------
-
-
-def _q437_sql(engine: str) -> str:
-    if engine == "spark":
-        w = """SELECT base, p AS pos, word
-             FROM (SELECT base, posexplode(split(mixed, ' '))
-                     AS (p, word) FROM mix) t"""
-    else:
-        w = """SELECT base, r.range - 1 AS pos,
-                    split_part(mixed, ' ', CAST(r.range AS INT)) AS word
-             FROM mix, range(1, 4000) r
-             WHERE r.range <= CASE
-                 WHEN length(mixed) - length(replace(mixed, ' ', ''))
-                      + 1 > 3990
-                 THEN error('q437 fixture outgrew range bound')
-                 ELSE length(mixed)
-                      - length(replace(mixed, ' ', '')) + 1 END"""
-    d = "//" if engine == "duck" else "div"
-    ph = ("CASE {x} WHEN 0 THEN 'the and of a'"
-          " WHEN 1 THEN 'el la de y'"
-          " WHEN 2 THEN 'der die und das'"
-          " ELSE 'le la et les' END")
-    return f"""WITH pair AS (SELECT doc_id,
-                      (doc_id * 3) % 4 AS l1,
-                      CASE WHEN doc_id % 2 = 0 THEN (doc_id * 3) % 4
-                           ELSE ((doc_id * 3) % 4 + 1
-                                 + (doc_id {d} 2) % 3) % 4
-                      END AS l2
-               FROM documents),
-       mix AS (SELECT doc_id AS base,
-                      rtrim(repeat({ph.format(x='l1')} || ' ', 5))
-                        || ' ' ||
-                      rtrim(repeat({ph.format(x='l2')} || ' ', 5))
-                        AS mixed,
-                      CASE WHEN l1 = l2 THEN 1 ELSE 0 END AS same_lang
-               FROM pair),
-       w AS ({w}),
-       ch AS (SELECT base, pos {d} 20 AS chunk,
-                     CASE WHEN word IN ('the','and','of','a')
-                          THEN 1 ELSE 0 END AS en,
-                     CASE WHEN word IN ('el','la','de','y')
-                          THEN 1 ELSE 0 END AS es,
-                     CASE WHEN word IN ('der','die','und','das')
-                          THEN 1 ELSE 0 END AS de,
-                     CASE WHEN word IN ('le','la','et','les')
-                          THEN 1 ELSE 0 END AS fr
-              FROM w),
-       cl AS (SELECT base, chunk,
-                     CAST(sum(en) AS BIGINT) AS s_en,
-                     CAST(sum(es) AS BIGINT) AS s_es,
-                     CAST(sum(de) AS BIGINT) AS s_de,
-                     CAST(sum(fr) AS BIGINT) AS s_fr
-              FROM ch GROUP BY base, chunk),
-       lab AS (SELECT base, chunk,
-                 CASE WHEN greatest(s_en,s_es,s_de,s_fr) = 0 THEN 'und'
-                      WHEN s_de = greatest(s_en,s_es,s_de,s_fr) THEN 'de'
-                      WHEN s_en = greatest(s_en,s_es,s_de,s_fr) THEN 'en'
-                      WHEN s_es = greatest(s_en,s_es,s_de,s_fr) THEN 'es'
-                      ELSE 'fr' END AS cl_lang
-               FROM cl),
-       sw AS (SELECT x.base,
-                     CAST(count(*) AS BIGINT) AS n_chunks,
-                     CAST(count(DISTINCT x.cl_lang) AS BIGINT) AS n_langs,
-                     CAST(sum(CASE WHEN y.cl_lang IS NOT NULL
-                              AND y.cl_lang <> x.cl_lang
-                              THEN 1 ELSE 0 END) AS BIGINT) AS switches
-              FROM lab x LEFT JOIN lab y
-                ON x.base = y.base AND y.chunk = x.chunk + 1
-              GROUP BY x.base)
-       SELECT mix.same_lang,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(sw.switches) AS BIGINT) AS total_switches,
-              CAST(sum(CASE WHEN sw.switches > 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS docs_switching,
-              CAST(sum(sw.n_langs) AS BIGINT) AS total_langs,
-              CAST(sum(sw.n_chunks) AS BIGINT) AS total_chunks
-       FROM mix JOIN sw ON mix.base = sw.base
-       GROUP BY mix.same_lang"""
-
-
-@query("q437_code_switching", _q437_sql("duck"))
-def q437(spark, sf_dir):
-    """Code-switching detection — the curation feature monolingual
-    lang-id (q22) cannot express: a document that CHANGES language
-    midway needs different handling (split, route, or drop) than a
-    mixed-vocabulary one.  Two 20-word marker-vocabulary segments per
-    doc (the corpus text itself carries NO language signal — q22's
-    confusion matrix shows only 'en' is ever classifiable, so a
-    concat-real-texts fixture gave the same switch rate in both
-    classes, caught live; controlled segments make the plant crisp),
-    deterministically same- or cross-language with same_lang as
-    ground truth; 20-word chunks align with segments and classify
-    through q22's exact stopword scorer (one combinable groupBy over
-    position-exploded words, the q414 engine/oracle enumeration
-    split); switches count adjacent disagreeing chunks via a chunk+1
-    offset equi-join (the q394 runs idiom).  Cross-language docs
-    switch EXACTLY once and same-language docs never — emitted
-    per-class totals prove detector precision and recall are both 1
-    on the plant."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q437_docs")
-    return spark.sql(_q437_sql("spark").replace("FROM documents",
-                                                "FROM q437_docs"))
-
-
-# --- nDCG ranking quality (q438) -----------------------------------------------------
-
-_Q438_DISC = [
-    "1.0", "0.6309297535714575", "0.5", "0.43067655807339306",
-    "0.38685280723454163", "0.3562071871080222", "0.3333333333333333",
-    "0.31546487678572877", "0.3010299956639812", "0.2890648263178879",
-]
-
-
-def _q438_sql(engine: str) -> str:
-    rc = "range" if engine == "duck" else "id"
-    d = "//" if engine == "duck" else "div"
-    piv_g = ", ".join(
-        f"max(CASE WHEN pos = {p} THEN CAST(gain AS DOUBLE) END) AS g{p}"
-        for p in range(1, 11))
-    piv_s = ", ".join(
-        f"max(CASE WHEN rnk = {p} THEN CAST(gain AS DOUBLE) END) AS s{p}"
-        for p in range(1, 11))
-    # bare decimal literals parse as DECIMAL in BOTH engines (the
-    # documented CAST('…' AS DOUBLE) idiom) — a DECIMAL chain came
-    # back as arbitrary-precision objects on the Spark side
-    dcg = "g1 * CAST('1.0' AS DOUBLE)"
-    idcg = "s1 * CAST('1.0' AS DOUBLE)"
-    for p in range(2, 11):
-        c = f"CAST('{_Q438_DISC[p-1]}' AS DOUBLE)"
-        dcg = f"({dcg} + g{p} * {c})"
-        idcg = f"({idcg} + s{p} * {c})"
-    return f"""WITH q AS (SELECT CAST(n_nationkey AS BIGINT) AS qid
-             FROM nation WHERE n_nationkey < 10),
-       r AS (SELECT q.qid, p.{rc} AS pos,
-                    CASE WHEN q.qid = 0
-                         THEN CAST(3 - (p.{rc} - 1) {d} 4 AS BIGINT)
-                         ELSE CAST((q.qid * 7 + p.{rc} * 3) % 4
-                              AS BIGINT) END AS gain
-             FROM q, range(1, 11) p),
-       rr AS (SELECT qid, pos, gain,
-                     row_number() OVER (PARTITION BY qid
-                       ORDER BY gain DESC, pos) AS rnk
-              FROM r),
-       pg AS (SELECT qid, {piv_g} FROM rr GROUP BY qid),
-       ps AS (SELECT qid, {piv_s} FROM rr GROUP BY qid),
-       dc AS (SELECT pg.qid, {dcg} AS dcg, {idcg} AS idcg
-              FROM pg JOIN ps ON pg.qid = ps.qid)
-       SELECT qid, dcg, idcg, dcg / idcg AS ndcg
-       FROM dc"""
-
-
-@query("q438_ndcg_at_10", _q438_sql("duck"))
-def q438(spark, sf_dir):
-    """nDCG@10 — the graded ranking metric missing from the eval
-    suite (MRR q372 is binary, AUC q379 is threshold-free, pass@k
-    q409 is attempt-based; graded relevance needs the log-position
-    discount): the ten 1/log2(pos+1) discounts are Python-computed
-    constants inlined VERBATIM (transcendental constants allowed,
-    functions not — the q426/q73 rule), and BOTH the system DCG and
-    the ideal DCG are FIXED left-to-right chains over rank-pivoted
-    columns (the q179 rule — a SUM() over positions would be an
-    unordered float sum), the ideal ordering coming from one
-    row_number with the (gain DESC, pos) tie pinned.  Exact integer
-    gains; one division per query; qid 0's gains are non-increasing by
-    construction so its nDCG is exactly 1.0, the others sit below —
-    both outcomes present.  Bounded: 10 queries x 10 positions."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("q438_nation")
-    return spark.sql(_q438_sql("spark").replace("FROM nation",
-                                                "FROM q438_nation"))
-
-
-# --- snapshot contribution analysis (q439) -------------------------------------------
-
-
-def _q439_sql(divop: str) -> str:
-    return f"""WITH a AS (SELECT lang, source,
-                    CAST(sum(n_chars) AS BIGINT) AS tok
-             FROM documents GROUP BY lang, source),
-       b0 AS (SELECT lang, source,
-                     CASE WHEN (doc_id {divop} 20) % 5 = 2
-                          THEN n_chars + 50 ELSE n_chars END AS nc
-              FROM documents
-              WHERE (doc_id {divop} 20) % 5 <> 1),
-       b AS (SELECT lang, source, CAST(sum(nc) AS BIGINT) AS tok
-             FROM b0 GROUP BY lang, source),
-       g AS (SELECT coalesce(a.lang, b.lang) AS lang,
-                    coalesce(a.source, b.source) AS source,
-                    CAST(coalesce(b.tok, 0) - coalesce(a.tok, 0)
-                      AS BIGINT) AS delta
-             FROM a FULL OUTER JOIN b
-               ON a.lang = b.lang AND a.source = b.source),
-       tot AS (SELECT CAST(sum(delta) AS BIGINT) AS total_delta
-               FROM g),
-       ta AS (SELECT CAST(sum(tok) AS BIGINT) AS tok_a FROM a),
-       tb AS (SELECT CAST(sum(tok) AS BIGINT) AS tok_b FROM b)
-       SELECT g.lang, g.source, g.delta,
-              CAST(row_number() OVER (ORDER BY abs(g.delta) DESC,
-                g.lang, g.source) AS BIGINT) AS contrib_rank,
-              tot.total_delta,
-              CAST(tb.tok_b - ta.tok_a - tot.total_delta AS BIGINT)
-                AS residual
-       FROM g CROSS JOIN tot CROSS JOIN ta CROSS JOIN tb
-       WHERE 200 * abs(g.delta) >= abs(tot.total_delta)"""
-
-
-@query("q439_contribution_analysis", _q439_sql("//"))
-def q439(spark, sf_dir):
-    """Snapshot contribution analysis — the 'why did total tokens
-    move?' drill-down every corpus dashboard needs after a policy
-    change: the metric delta between two snapshots decomposes
-    EXACTLY into per-(lang, source) contributions via one FULL
-    OUTER join of the two bounded rollups, and the residual column
-    PROVES the decomposition is complete (tok_B - tok_A - sum of
-    contributions == 0 on every emitted row — additive metrics
-    decompose with zero residual, which is why dashboards use sums
-    and not ratios for drill-down).  The planted change mixes BOTH
-    signs (one doc class dropped, another grown +50 chars/doc) so
-    contributions compete; only groups carrying >= 1/200 of the
-    total move are emitted (cross-multiplied, output stays bounded
-    at any corpus size), ranked by |delta| with ties pinned."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q439_docs")
-    return spark.sql(_q439_sql("div").replace("FROM documents",
-                                              "FROM q439_docs"))
-
-
-# --- Markov absorption probabilities (q440) ------------------------------------------
-
-
-def _q440_det(col_b: str | None = None, k: int = -1) -> str:
-    """3x3 determinant of A = diag(n) - C with column k optionally
-    replaced by vector ``col_b`` — expanded by the first row, pure
-    integer arithmetic, generated once and shared verbatim."""
-    def a(i, j):
-        if j == k:
-            return f"{col_b}{i}"
-        return f"(n{i} - c{i}{i})" if i == j else f"(0 - c{i}{j})"
-    return (f"({a(0,0)} * ({a(1,1)} * {a(2,2)} - {a(1,2)} * {a(2,1)})"
-            f" - {a(0,1)} * ({a(1,0)} * {a(2,2)} - {a(1,2)} * {a(2,0)})"
-            f" + {a(0,2)} * ({a(1,0)} * {a(2,1)} - {a(1,1)} * {a(2,0)}))")
-
-
-def _q440_sql(engine: str) -> str:
-    es = ("CAST(floor(epoch(ts)) AS BIGINT)" if engine == "duck"
-          else "unix_timestamp(ts)")
-    piv = ", ".join(
-        [f"CAST(coalesce(max(CASE WHEN f = {i} AND t = {j} THEN cnt END),"
-         f" 0) AS BIGINT) AS c{i}{j}"
-         for i in range(3) for j in range(3)]
-        + [f"CAST(coalesce(max(CASE WHEN f = {i} AND t = 3 THEN cnt END),"
-           f" 0) AS BIGINT) AS bc{i}" for i in range(3)]
-        + [f"CAST(coalesce(max(CASE WHEN f = {i} AND t = 4 THEN cnt END),"
-           f" 0) AS BIGINT) AS be{i}" for i in range(3)]
-        + [f"CAST(coalesce(sum(CASE WHEN f = {i} THEN cnt END), 0)"
-           f" AS BIGINT) AS n{i}" for i in range(3)])
-    det = _q440_det()
-    rows = []
-    for i in range(3):
-        dc = _q440_det("bc", i)
-        de = _q440_det("be", i)
-        rows.append(f"""SELECT CAST({i} AS BIGINT) AS state,
-              n{i} AS n_out,
-              CAST({dc} AS DOUBLE) / CAST({det} AS DOUBLE) AS p_convert,
-              CAST({de} AS DOUBLE) / CAST({det} AS DOUBLE) AS p_exit,
-              CAST({dc} + {de} - {det} AS BIGINT) AS resid_identity
-       FROM m""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH ev AS (SELECT user_id, {es} AS es, event_id,
-                    CASE event_type WHEN 'view' THEN 0
-                         WHEN 'click' THEN 1 WHEN 'signup' THEN 2
-                         WHEN 'purchase' THEN 3 ELSE 4 END AS st
-             FROM events),
-       ordn AS (SELECT user_id, st,
-                      row_number() OVER (PARTITION BY user_id
-                        ORDER BY es, event_id) AS o
-               FROM ev),
-       fa AS (SELECT user_id, min(o) AS fabs FROM ordn
-              WHERE st >= 3 GROUP BY user_id),
-       tr AS (SELECT a.st AS f, b.st AS t,
-                     CAST(count(*) AS BIGINT) AS cnt
-              FROM ordn a JOIN ordn b
-                ON a.user_id = b.user_id AND b.o = a.o + 1
-              LEFT JOIN fa ON a.user_id = fa.user_id
-              WHERE fa.fabs IS NULL OR a.o < fa.fabs
-              GROUP BY a.st, b.st),
-       m AS (SELECT {piv} FROM tr)
-       {body}"""
-
-
-@query("q440_markov_absorption", _q440_sql("duck"))
-def q440(spark, sf_dir):
-    """Markov absorption probabilities — the fundamental-matrix
-    question q324's raw transition counts cannot answer (will this
-    session eventually CONVERT or EXIT, from each state?): chains
-    truncate at the first absorbing event (purchase/error), the 3x3
-    transient system (diag(n) - C) x = b solves by CRAMER over exact
-    BIGINT transition counts (the q197 adjugate idiom — determinants
-    expanded once in Python and shared verbatim), ONE division per
-    probability.  The complementarity PROOF is exact integer
-    algebra: A*1 = b_convert + b_exit row-wise, so det_k(convert) +
-    det_k(exit) == det and resid_identity is 0 on every row — the
-    two absorption probabilities sum to exactly 1 without any float
-    addition.  Shape: one row_number, one offset-1 transition join
-    (the q394 runs idiom), a 25-cell pivot, then scalar algebra."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q440_events")
-    return spark.sql(_q440_sql("spark").replace("FROM events",
-                                                "FROM q440_events"))
-
-
-# --- fan-out tail latency (q441) -----------------------------------------------------
-
-
-def _q441_sql(divop: str) -> str:
-    p8 = " * ".join(["p"] * 8)
-    return f"""WITH lat AS (SELECT CASE WHEN event_id % 20 < 19
-                         THEN (event_id * 13) % 16
-                         ELSE 16 + ((event_id {divop} 20) * 13) % 48
-                    END AS bin
-             FROM events),
-       h AS (SELECT bin, CAST(count(*) AS BIGINT) AS c
-             FROM lat GROUP BY bin),
-       cum AS (SELECT bin,
-                      CAST(sum(c) OVER (ORDER BY bin
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cc,
-                      CAST(sum(c) OVER () AS BIGINT) AS n
-               FROM h),
-       f AS (SELECT bin, cc, n,
-                    CAST(cc AS DOUBLE) / CAST(n AS DOUBLE) AS p
-             FROM cum),
-       g AS (SELECT bin, cc, n, p, {p8} AS p_fanout8 FROM f)
-       SELECT bin, cc, n, p, p_fanout8,
-              CAST(CASE WHEN 100 * cc >= 99 * n
-                   THEN 1 ELSE 0 END AS BIGINT) AS single_p99_here,
-              CAST(CASE WHEN p_fanout8 >= 0.99
-                   THEN 1 ELSE 0 END AS BIGINT) AS fanout_p99_here
-       FROM g
-       WHERE 100 * cc >= 90 * n"""
-
-
-@query("q441_fanout_tail_latency", _q441_sql("//"))
-def q441(spark, sf_dir):
-    """Fan-out tail latency — Dean & Barroso's 'tail at scale'
-    arithmetic made exact: a request touching 8 shards completes by
-    time t only if ALL do, so P(done <= t) = F(t)^8 — computed as an
-    explicit 8-fold multiplication chain over the empirical CDF
-    (identical expression tree both engines, no pow()), with the
-    CDF itself exact-integer (cumulative window over the BOUNDED
-    64-bin latency histogram, single division per bin).  The output
-    contrasts where the single-shard p99 lands vs where the 8-way
-    fan-out's p99 lands (the single_p99/fanout_p99 flags use
-    cross-multiplied integers and the chained double respectively)
-    — on the planted long-tail distribution (95% fast, 5%
-    stragglers over 48 slow bins — slow bins derive from event_id
-    div 20 because a *13%48 of the %20-selected ids only hits every
-    4th bin, the gcd trap in its latency-histogram costume) the single-shard p99 lands ~8
-    bins before the fan-out p99, the quantified reason hedged
-    requests exist.  Emitted rows are the
-    tail (>= p90), bounded by the bin domain."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q441_events")
-    return spark.sql(_q441_sql("div").replace("FROM events",
-                                              "FROM q441_events"))
-
-
-# --- hypsometric curve + integral (q442) ---------------------------------------------
-
-
-def _q442_sql(engine: str) -> str:
-    rc = "range" if engine == "duck" else "id"
-    d = "//" if engine == "duck" else "div"
-    return f"""WITH dem AS (SELECT ((gx.{rc} - 32) * (gx.{rc} - 32)
-                      + (gy.{rc} - 32) * (gy.{rc} - 32)) {d} 8
-                      + (gx.{rc} * 7 + gy.{rc} * 13) % 23 AS z
-             FROM range(0, 64) gx, range(0, 64) gy),
-       st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                     CAST(min(z) AS BIGINT) AS zmin,
-                     CAST(max(z) AS BIGINT) AS zmax,
-                     CAST(sum(z) AS BIGINT) AS zsum
-              FROM dem),
-       h AS (SELECT z {d} 16 AS bin, CAST(count(*) AS BIGINT) AS c
-             FROM dem GROUP BY z {d} 16),
-       cum AS (SELECT bin, c,
-                      CAST(sum(c) OVER (ORDER BY bin DESC
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS above
-               FROM h)
-       SELECT cum.bin, cum.c, cum.above,
-              CAST(cum.above AS DOUBLE) / CAST(st.n AS DOUBLE)
-                AS rel_area,
-              CAST(st.zsum - st.n * st.zmin AS DOUBLE)
-                / CAST(st.n * (st.zmax - st.zmin) AS DOUBLE)
-                AS hypsometric_integral,
-              CAST(CASE WHEN st.zsum - st.n * st.zmin >= 0
-                        AND st.zsum - st.n * st.zmin
-                            <= st.n * (st.zmax - st.zmin)
-                   THEN 1 ELSE 0 END AS BIGINT) AS hi_in_unit
-       FROM cum CROSS JOIN st"""
-
-
-@query("q442_hypsometric_curve", _q442_sql("duck"))
-def q442(spark, sf_dir):
-    """Hypsometric curve + integral — the DEM maturity statistic
-    (Strahler) completing the gdaldem family (q70-q75, q245-q247,
-    q264-q265 cover derivatives; hypsometry is the DISTRIBUTIONAL
-    terrain descriptor): relative area above each elevation band
-    from one elevation histogram + a DESC cumulative window over the
-    BOUNDED bin domain, and the hypsometric integral via the exact
-    identity HI = (mean - min)/(max - min) — cross-multiplied
-    BIGINTs (zsum - n*zmin over n*(zmax - zmin)), ONE division,
-    with the 0 <= HI <= 1 bound emitted as an integer proof.  The
-    synthetic bowl-with-ripple DEM generates from integer formulas
-    identically in both engines; curve monotonicity is by
-    construction of the DESC cumulative."""
-    spark.range(1).createOrReplaceTempView("q442_dummy")
-    return spark.sql(_q442_sql("spark"))
-
-
-# --- sample-size planning for dup-rate estimation (q443) -----------------------------
-
-
-def _q443_sql(divop: str) -> str:
-    return f"""WITH corp AS (SELECT source, text FROM documents
-               UNION ALL
-               SELECT source, text FROM documents
-               WHERE doc_id % 9 = 4),
-       fp AS (SELECT source, md5(text) AS f FROM corp),
-       fc AS (SELECT source, f, CAST(count(*) AS BIGINT) AS c
-              FROM fp GROUP BY source, f),
-       agg AS (SELECT source,
-                      CAST(sum(c) AS BIGINT) AS t,
-                      CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END)
-                        AS BIGINT) AS d
-               FROM fc GROUP BY source)
-       SELECT source, t, d,
-              CAST(d AS DOUBLE) / CAST(t AS DOUBLE) AS dup_rate,
-              CAST((40000 * d * (t - d) + t * t - 1)
-                   {divop} (t * t) AS BIGINT) AS n_pm1pct,
-              CAST((1600 * d * (t - d) + t * t - 1)
-                   {divop} (t * t) AS BIGINT) AS n_pm5pct,
-              CAST(CASE WHEN (40000 * d * (t - d) + t * t - 1)
-                             {divop} (t * t) >= t
-                   THEN 1 ELSE 0 END AS BIGINT) AS census_cheaper
-       FROM agg"""
-
-
-@query("q443_sample_size_planning", _q443_sql("//"))
-def q443(spark, sf_dir):
-    """Sample-size planning for dup-rate estimation — the
-    measurement-methodology op behind every quality dashboard
-    number: how many docs must be audited to estimate a source's
-    duplicate rate to +-1% (or +-5%) at 95% confidence?  n =
-    z^2 p(1-p)/e^2 stays EXACT-INTEGER with z = 2: n_pm1pct =
-    ceil(40000 d (t-d) / t^2) via the (a + b - 1) div b ceiling
-    idiom — no floats anywhere but the reported rate itself (one
-    division).  The true dup rate comes from the md5-fingerprint
-    histogram over a corpus with every ninth doc re-served (the raw
-    fixture's texts are distinct WITHIN a source, so the unseeded
-    rate was identically 0 — caught live); census_cheaper flags
-    sources where the required sample exceeds the population —
-    audit everything instead, the finite-population decision, and
-    at 25-doc fixture sources it fires exactly where d > 0.  One fingerprint
-    groupBy, bounded source rollup."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q443_docs")
-    return spark.sql(_q443_sql("div").replace("FROM documents",
-                                              "FROM q443_docs"))
-
-
-# --- pipeline-parallel bubble planning (q444) ----------------------------------------
-
-
-def _q444_sql(divop: str) -> str:
-    return f"""WITH tok AS (SELECT CAST(sum(n_chars) AS BIGINT) AS t
-             FROM documents),
-       grid AS (SELECT CAST(p.p AS BIGINT) AS p, CAST(m.m AS BIGINT) AS m
-                FROM (VALUES (2), (4), (8)) p(p),
-                     (VALUES (4), (8), (16), (32)) m(m))
-       SELECT g.p, g.m,
-              CAST(g.p - 1 AS BIGINT) AS bubble_num,
-              CAST(g.m + g.p - 1 AS BIGINT) AS bubble_den,
-              CAST(g.p - 1 AS DOUBLE) / CAST(g.m + g.p - 1 AS DOUBLE)
-                AS bubble_frac,
-              CAST(g.m AS DOUBLE) / CAST(g.m + g.p - 1 AS DOUBLE)
-                AS rel_throughput,
-              CAST(CASE WHEN 10 * (g.p - 1) <= g.m + g.p - 1
-                   THEN 1 ELSE 0 END AS BIGINT) AS bubble_under_10pct,
-              CAST((tok.t + g.m * 1024 - 1) {divop} (g.m * 1024)
-                AS BIGINT) AS steps_per_epoch
-       FROM grid g CROSS JOIN tok"""
-
-
-@query("q444_pipeline_bubble", _q444_sql("//"))
-def q444(spark, sf_dir):
-    """Pipeline-parallel bubble planning (the GPipe/1F1B scheduling
-    arithmetic that decides microbatch counts before a training run
-    commits 1000 GPUs): over a (stages p, microbatches m) grid, the
-    bubble fraction (p-1)/(m+p-1) and relative throughput
-    m/(m+p-1) are exact rationals (numerator/denominator emitted as
-    BIGINTs, one division each), the <=10% bubble gate is a pure
-    integer cross-multiplication 10(p-1) <= m+p-1, and
-    steps-per-epoch ties the plan to the ACTUAL corpus token count
-    via the (a+b-1) div b ceiling idiom.  The table shows the
-    tradeoff the scheduler navigates: deeper pipelines need
-    proportionally more microbatches (p=8 needs m >= 63 for the
-    gate none of the grid's m reach, p=2 clears it at m=16).  One
-    corpus scan for tokens; the grid is 12 rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q444_docs")
-    return spark.sql(_q444_sql("div").replace("FROM documents",
-                                              "FROM q444_docs"))
-
-
-# --- MoE expert-capacity overflow (q445) ---------------------------------------------
-
-
-def _q445_sql(engine: str) -> str:
-    d = "//" if engine == "duck" else "div"
-    h = ("CAST(CAST('0x' || substr(md5('e' || CAST(doc_id AS VARCHAR)),"
-         " 1, 8) AS UBIGINT) AS BIGINT)" if engine == "duck"
-         else "CAST(conv(substr(md5('e' || CAST(doc_id AS STRING)),"
-              " 1, 8), 16, 10) AS BIGINT)")
-    return f"""WITH rt AS (SELECT doc_id,
-                    CASE WHEN (doc_id {d} 20) % 5 = 0 THEN 0
-                         ELSE {h} % 8 END AS expert
-             FROM documents),
-       c AS (SELECT expert, CAST(count(*) AS BIGINT) AS routed
-             FROM rt GROUP BY expert),
-       n AS (SELECT CAST(sum(routed) AS BIGINT) AS total FROM c),
-       caps AS (SELECT CAST(cf.cf AS BIGINT) AS cf_x100
-                FROM (VALUES (100), (125)) cf(cf))
-       SELECT c.expert, caps.cf_x100, c.routed, n.total,
-              CAST((n.total * caps.cf_x100 + 799) {d} 800 AS BIGINT)
-                AS cap,
-              CAST(CASE WHEN c.routed >
-                        (n.total * caps.cf_x100 + 799) {d} 800
-                   THEN c.routed
-                        - (n.total * caps.cf_x100 + 799) {d} 800
-                   ELSE 0 END AS BIGINT) AS dropped,
-              CAST(sum(c.routed) OVER (PARTITION BY caps.cf_x100)
-                AS BIGINT) AS routed_check
-       FROM c CROSS JOIN caps CROSS JOIN n"""
-
-
-@query("q445_moe_capacity_overflow", _q445_sql("duck"))
-def q445(spark, sf_dir):
-    """MoE expert-capacity overflow accounting (the Switch-
-    Transformer token-dropping arithmetic: each of 8 experts accepts
-    at most ceil(N/8 * capacity_factor) tokens and the rest are
-    DROPPED — the load-balance failure mode a router audit must
-    quantify before training): routing is hash-based with a planted
-    hot expert (one div-derived doc class always routes to expert
-    0), capacity uses the exact ceiling idiom (N*cf_x100 + 799) div
-    800 so the whole table is integer at capacity factors 1.00 and
-    1.25, and routed_check == N rides along as the conservation
-    proof (drops are accounting, tokens never vanish from the
-    audit).  The hot expert overflows at BOTH factors while the
-    hash-balanced seven drop nothing — exactly the signature an
-    imbalanced router shows.  One groupBy to the 8-expert table;
-    the capacity axis is a 2-row VALUES join."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q445_docs")
-    return spark.sql(_q445_sql("spark").replace("FROM documents",
-                                                "FROM q445_docs"))
-
-
-# --- hedged-request policy evaluation (q446) -----------------------------------------
-
-
-def _q446_sql(divop: str) -> str:
-    return f"""WITH lat AS (SELECT CASE WHEN event_id % 20 < 19
-                         THEN (event_id * 13) % 16
-                         ELSE 16 + ((event_id {divop} 20) * 13) % 48
-                    END AS bin
-             FROM events),
-       h AS (SELECT bin, CAST(count(*) AS BIGINT) AS c
-             FROM lat GROUP BY bin),
-       cum AS (SELECT bin,
-                      CAST(sum(c) OVER (ORDER BY bin
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cc,
-                      CAST(sum(c) OVER () AS BIGINT) AS n
-               FROM h),
-       f AS (SELECT bin, cc, n,
-                    CAST(cc AS DOUBLE) / CAST(n AS DOUBLE) AS p
-             FROM cum),
-       t95 AS (SELECT CAST(min(bin) AS BIGINT) AS b95
-               FROM f WHERE 100 * cc >= 95 * n),
-       g AS (SELECT f.bin, f.p, t95.b95,
-                    1.0 - (1.0 - f.p) * (1.0 - f.p) AS p_hedge2,
-                    CASE WHEN f.bin < t95.b95 THEN f.p
-                         ELSE 1.0 - (1.0 - f.p)
-                              * (1.0 - coalesce(fs.p, 0.0))
-                    END AS p_tied
-             FROM f CROSS JOIN t95
-             LEFT JOIN f fs ON fs.bin = f.bin - t95.b95)
-       SELECT bin, p, p_hedge2, p_tied, b95,
-              CAST(CASE WHEN p_hedge2 >= p THEN 1 ELSE 0 END
-                AS BIGINT) AS hedge_dominates,
-              CAST(CASE WHEN p_tied >= p THEN 1 ELSE 0 END
-                AS BIGINT) AS tied_dominates
-       FROM g WHERE bin >= 40"""
-
-
-@query("q446_hedged_requests", _q446_sql("//"))
-def q446(spark, sf_dir):
-    """Hedged-request policy evaluation — the OTHER half of q441's
-    tail-at-scale story (fan-out makes tails worse; hedging buys
-    them back): full hedging completes by t when EITHER of two
-    replicas does, P = 1-(1-F(t))^2 (explicit squared chain, no
-    pow), while TIED hedging fires the second request only after
-    the p95 bin, so completion by t needs the original OR the
-    delayed hedge: 1 - (1-F(t))(1-F(t-p95)) for t >= p95 — a pure
-    bin-SHIFT self-join of the SAME exact-integer CDF (the first
-    cut's correlated-subquery additive form silently matched nothing
-    AND could exceed 1, caught live).  Both dominance flags hold on every
-    emitted tail row — hedging can only help completion
-    probability — while the load prices differ (2x vs ~1.05x), the
-    tradeoff Dean-Barroso's tied requests won.  Bounded by the
-    64-bin domain; emitted rows are the tail."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q446_events")
-    return spark.sql(_q446_sql("div").replace("FROM events",
-                                              "FROM q446_events"))
-
-
-# --- erasure-coding durability planning (q447) ---------------------------------------
-
-_Q447_CONFIGS = [(4, 2), (8, 3), (10, 4), (17, 3)]
-
-
-def _q447_sql(divop: str) -> str:
-    import math
-    rows = []
-    for k, m in _Q447_CONFIGS:
-        n = k + m
-        comb = math.comb(n, m + 1)
-        # P(>= m+1 of n shards down) ~ C(n, m+1) p^(m+1), p = 1/256
-        pchain = " * ".join(["CAST('0.00390625' AS DOUBLE)"] * (m + 1))
-        rows.append(f"""SELECT CAST({k} AS BIGINT) AS k,
-              CAST({m} AS BIGINT) AS m,
-              CAST({n} AS BIGINT) AS n_shards,
-              CAST({1000 * n} {divop} {k} AS BIGINT) AS overhead_x1000,
-              CAST({comb} AS BIGINT) AS loss_combos,
-              {comb} * {pchain} AS p_window_loss,
-              CAST(st.bytes_logical AS BIGINT) AS bytes_logical,
-              CAST(st.bytes_logical * {n} {divop} {k} AS BIGINT)
-                AS bytes_physical
-       FROM st""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH st AS (SELECT CAST(sum(n_chars) AS BIGINT)
-                 AS bytes_logical FROM documents)
-       {body}"""
-
-
-@query("q447_erasure_durability", _q447_sql("//"))
-def q447(spark, sf_dir):
-    """Erasure-coding durability planning — the RS(k, m) choice a
-    100-TB store makes once and lives with (the durability
-    counterpart to q396's CAS accounting and q352's tiering):
-    storage overhead n/k lands as an exact x1000 integer, the
-    data-loss exposure per repair window is the dominant term
-    C(n, m+1) p^(m+1) with the binomial Python-precomputed
-    (math.comb, inlined verbatim) and the dyadic shard-failure
-    probability 1/256 raised by an explicit multiplication chain
-    (no pow; CAST('…' AS DOUBLE) per the decimal-literal rule), and
-    physical bytes tie the plan to the ACTUAL corpus size via the
-    shared scan.  The table exposes the real tradeoff: RS(17,3)
-    stores 1.18x at 816 loss-combos while RS(4,2) stores 1.5x at
-    20 — wider stripes are cheaper but lose more ways.  One corpus
-    scan; four plan rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q447_docs")
-    return spark.sql(_q447_sql("div").replace("FROM documents",
-                                              "FROM q447_docs"))
-
-
 # --- gdalwarp order-statistic resampling modes (q448) --------------------------------
 
 
@@ -27225,7 +10103,7 @@ def _q448_oracle() -> str:
        JOIN qb ON qb.gx = agg.gx AND qb.gy = agg.gy"""
 
 
-@query("q448_warp_order_stats", _q448_oracle())
+@query("q448_warp_order_stats", _q448_oracle(), kind="operator")
 def q448(spark, sf_dir):
     """gdalwarp ORDER-STATISTIC resampling — min/max/med/q1/q3/sum,
     the six remaining GRA_ modes after q157-q160/q169-q171 closed
@@ -27275,6 +10153,7 @@ _ZT_SLOPE_EXPR = "50.0 * sqrt(4.0 * (p*p) + 4.0 * (q*q))"
               round({_ZT_SLOPE_EXPR}, 6) AS slope_pct,
               round({_aspect_sql('p', 'q', '2.0')}, 3) AS aspect
        FROM pq""",
+    kind="operator",
 )
 def q449(spark, sf_dir):
     """gdaldem -alg ZevenbergenThorne slope (percent) + aspect
@@ -27299,212 +10178,6 @@ def q449(spark, sf_dir):
         "gx", "gy",
         F.round(F.expr(_ZT_SLOPE_EXPR), 6).alias("slope_pct"),
         F.round(F.expr(_aspect_sql("p", "q", "2.0")), 3).alias("aspect"),
-    )
-
-
-# --- Young-Daly checkpoint-interval planning (q450) ----------------------------------
-
-
-def _q450_sql(divop: str) -> str:
-    return f"""WITH st AS (SELECT CAST(1200 * sum(n_chars) AS BIGINT)
-                 AS state_bytes FROM documents),
-       grid AS (SELECT CAST(n.n AS BIGINT) AS nodes,
-                       CAST(b.b AS BIGINT) AS bw
-                FROM (VALUES (16), (256), (1024), (4096)) n(n),
-                     (VALUES (1000000000), (10000000000)) b(b)),
-       d AS (SELECT g.nodes, g.bw, st.state_bytes,
-                    CAST((1000 * st.state_bytes + g.bw - 1) {divop} g.bw
-                      AS BIGINT) AS delta_ms,
-                    CAST(2000000000 {divop} g.nodes AS BIGINT) AS mtbf_ms
-             FROM grid g CROSS JOIN st),
-       x AS (SELECT nodes, bw, state_bytes, delta_ms, mtbf_ms,
-                    CAST(2 * delta_ms * mtbf_ms AS BIGINT) AS xx
-             FROM d),
-       w0 AS (SELECT *, CAST(floor(sqrt(CAST(xx AS DOUBLE))) AS BIGINT)
-                AS wc FROM x),
-       w AS (SELECT nodes, bw, state_bytes, delta_ms, mtbf_ms, xx,
-                    wc + (CASE WHEN (wc + 1) * (wc + 1) <= xx
-                          THEN 1 ELSE 0 END)
-                       - (CASE WHEN wc * wc > xx THEN 1 ELSE 0 END)
-                      AS w_ms
-             FROM w0)
-       SELECT nodes, bw, state_bytes, delta_ms, mtbf_ms, w_ms,
-              CAST(CASE WHEN w_ms * w_ms <= xx THEN 1 ELSE 0 END
-                AS BIGINT) AS isqrt_lo_ok,
-              CAST(CASE WHEN (w_ms + 1) * (w_ms + 1) > xx THEN 1 ELSE 0 END
-                AS BIGINT) AS isqrt_hi_ok,
-              CAST(delta_ms AS DOUBLE) / CAST(w_ms AS DOUBLE)
-                + CAST(w_ms AS DOUBLE) / CAST(2 * mtbf_ms AS DOUBLE)
-                AS waste_frac,
-              CAST(CASE WHEN w_ms <= mtbf_ms THEN 1 ELSE 0 END
-                AS BIGINT) AS below_mtbf
-       FROM w"""
-
-
-@query("q450_checkpoint_interval", _q450_sql("//"))
-def q450(spark, sf_dir):
-    """Young-Daly optimal checkpoint interval — the fault-tolerance
-    planning arithmetic a 1000-node training or crawl fleet runs
-    before committing a checkpoint cadence (the counterpart to
-    q444's pipeline bubbles and q447's erasure durability; Young
-    1974 / Daly 2006: W* = sqrt(2*delta*MTBF)): checkpoint state
-    bytes tie to the ACTUAL corpus (1200 bytes of optimizer state
-    per char), write cost delta = ceil(state/bw) in ms via the
-    ceiling idiom over a (nodes, bandwidth) grid, cluster MTBF =
-    node-MTBF div nodes, and the square root is an EXACT INTEGER
-    isqrt: float sqrt seeds a candidate (error < 1 ulp at x << 2^52,
-    so within +-1) and two integer corrections land it exactly —
-    isqrt_lo_ok/isqrt_hi_ok EMIT the bracketing proof
-    w^2 <= x < (w+1)^2 on every row, no float value survives into
-    the interval column.  waste_frac = delta/W + W/(2M) is the
-    first-order optimum value (two exact-input divisions, fixed
-    tree).  The grid shows the real tradeoff: 4096 nodes at 1 GB/s
-    checkpoint 16x more often than 16 nodes at 10 GB/s.  One corpus
-    scan; 8 plan rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q450_docs")
-    return spark.sql(_q450_sql("div").replace("FROM documents",
-                                              "FROM q450_docs"))
-
-
-# --- speculative-decoding acceptance arithmetic (q451) -------------------------------
-
-_Q451_GRID = [(k, num, 8) for k in (1, 2, 4, 8) for num in (4, 6, 7)]
-
-
-def _q451_sql(divop: str) -> str:
-    rows = []
-    for k, num, den in _Q451_GRID:
-        e_num = den ** (k + 1) - num ** (k + 1)
-        e_den = den ** k * (den - num)
-        s_num = 16 * e_num
-        s_den = e_den * (k + 16)
-        rows.append(f"""SELECT CAST({k} AS BIGINT) AS k,
-              CAST({num} AS BIGINT) AS acc_num,
-              CAST({den} AS BIGINT) AS acc_den,
-              CAST({e_num} AS BIGINT) AS e_num,
-              CAST({e_den} AS BIGINT) AS e_den,
-              CAST({e_num} AS DOUBLE) / CAST({e_den} AS DOUBLE)
-                AS exp_tokens,
-              CAST({s_num} AS DOUBLE) / CAST({s_den} AS DOUBLE)
-                AS speedup,
-              CAST(CASE WHEN {e_num} >= {e_den} THEN 1 ELSE 0 END
-                AS BIGINT) AS at_least_one,
-              CAST(CASE WHEN {e_num} <= {k + 1} * {e_den} THEN 1 ELSE 0 END
-                AS BIGINT) AS at_most_k_plus_1,
-              CAST((tok.t * {e_den} + {e_num} - 1) {divop} {e_num}
-                AS BIGINT) AS target_calls,
-              CAST(tok.t AS BIGINT) AS baseline_calls
-       FROM tok""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH tok AS (SELECT CAST(sum(n_chars) AS BIGINT) AS t
-                 FROM documents),
-       g AS ({body})
-       SELECT g.*,
-              CAST(CASE WHEN row_number() OVER (PARTITION BY acc_num
-                        ORDER BY speedup DESC, k ASC) = 1
-                   THEN 1 ELSE 0 END AS BIGINT) AS is_best_k
-       FROM g"""
-
-
-@query("q451_speculative_decoding", _q451_sql("//"))
-def q451(spark, sf_dir):
-    """Speculative-decoding acceptance arithmetic — the
-    draft-then-verify serving plan (Leviathan et al. 2023): with
-    i.i.d. per-token acceptance a = num/den and draft length k, the
-    expected tokens per target-model call is the geometric partial
-    sum E = (1-a^(k+1))/(1-a), which stays an EXACT RATIONAL
-    e_num/e_den = (den^(k+1)-num^(k+1)) / (den^k (den-num)) with
-    the powers Python-precomputed and inlined (no pow(), no float
-    until ONE division); wall speedup divides by the step cost
-    1 + k/16 (draft at 1/16th target cost), again one exact-integer
-    division 16 e_num / (e_den (k+16)).  The bracketing proofs
-    1 <= E <= k+1 are EMITTED as pure integer comparisons, and
-    target_calls ties the plan to the ACTUAL corpus token count via
-    the exact ceiling (t*e_den + e_num - 1) div e_num — the number
-    of expensive model calls the corpus costs under each plan.
-    is_best_k exposes the real decision: at a = 7/8 deeper drafts
-    keep winning (k=8 best), at a = 1/2 the optimum is k=2 — the
-    acceptance-rate knee every speculative deployment measures.
-    One corpus scan; 12 plan rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q451_docs")
-    return spark.sql(_q451_sql("div").replace("FROM documents",
-                                              "FROM q451_docs"))
-
-
-# --- ColBERT late-interaction MaxSim retrieval (q452) --------------------------------
-
-
-@query(
-    "q452_late_interaction_maxsim",
-    """WITH v AS (SELECT vec_id,
-                list_transform(embedding,
-                    x -> CAST(floor(CAST(x AS DOUBLE)*1000 + 0.5) AS BIGINT))
-                    AS qv
-             FROM embeddings),
-       tok AS (SELECT vec_id // 8 AS did, vec_id % 8 AS tok, qv FROM v),
-       q AS (SELECT did AS qid, tok AS qtok, qv AS qqv FROM tok
-             WHERE did % 10 = 0),
-       pr AS (SELECT q.qid, q.qtok, t.did AS cand,
-                 CAST(list_sum(list_transform(list_zip(q.qqv, t.qv),
-                      s -> s[1]*s[2])) AS BIGINT) AS dot
-              FROM q JOIN tok t ON t.did % 10 <> 0),
-       mx AS (SELECT qid, qtok, cand, max(dot) AS mdot
-              FROM pr GROUP BY qid, qtok, cand),
-       sc AS (SELECT qid, cand, CAST(sum(mdot) AS BIGINT) AS score,
-                     CAST(count(*) AS BIGINT) AS n_qtok
-              FROM mx GROUP BY qid, cand),
-       r AS (SELECT qid, cand, score, n_qtok,
-                    row_number() OVER (PARTITION BY qid
-                                       ORDER BY score DESC, cand ASC)
-                      AS rnk
-             FROM sc)
-       SELECT qid, cand, score, n_qtok, CAST(rnk AS BIGINT) AS rnk
-       FROM r WHERE rnk <= 3""",
-)
-def q452(spark, sf_dir):
-    """ColBERT late-interaction MaxSim — the token-level retrieval
-    scorer between q23's single-vector cosine and full cross-
-    attention (Khattab & Zaharia 2020): score(q, d) = sum over query
-    tokens of the MAX dot product against any document token.  The
-    embeddings table becomes token-level by grouping 8 vectors per
-    pseudo-doc (did = vec_id div 8), integer-quantized per the q266
-    idiom so every dot, max, and sum is exact BIGINT; the per-token
-    argmax is a plain groupBy MAX (map-side combinable, never a
-    window over the token cross product) and top-3 ranks are pinned
-    (score DESC, cand ASC).  n_qtok == 8 rides along as the
-    query-token coverage proof.  Scale shape: the query side
-    broadcasts (queries are always the tiny side) and candidates
-    come from an ANN prefilter upstream (q32/q128) — the token join
-    is |Q_tok| x |cand_tok|, never corpus x corpus."""
-    v = _t(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)*1000 "
-        "+ 0.5) AS BIGINT)) AS qv",
-    )
-    tok = v.selectExpr("vec_id div 8 AS did", "vec_id % 8 AS tok", "qv")
-    q = tok.filter("did % 10 = 0").selectExpr(
-        "did AS qid", "tok AS qtok", "qv AS qqv")
-    pr = (
-        F.broadcast(q).join(tok, F.expr("did % 10 <> 0"))
-        .selectExpr(
-            "qid", "qtok", "did AS cand",
-            "aggregate(zip_with(qqv, qv, (x, y) -> x*y), "
-            "CAST(0 AS BIGINT), (a, x) -> a + x) AS dot",
-        )
-    )
-    mx = pr.groupBy("qid", "qtok", "cand").agg(F.max("dot").alias("mdot"))
-    sc = mx.groupBy("qid", "cand").agg(
-        F.sum("mdot").cast("long").alias("score"),
-        F.count("*").cast("long").alias("n_qtok"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("cand").asc())
-    return (
-        sc.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter("rnk <= 3")
-        .select("qid", "cand", "score", "n_qtok", "rnk")
     )
 
 
@@ -27533,6 +10206,7 @@ def q452(spark, sf_dir):
               CAST(CASE WHEN energy >= 215000 THEN 1 ELSE 0 END
                 AS BIGINT) AS voiced
        FROM fe""",
+    kind="operator",
 )
 def q453(spark, sf_dir):
     """Audio VAD features — per-frame zero-crossing rate + energy
@@ -27599,7 +10273,7 @@ def _q454_oracle() -> str:
        FROM tot CROSS JOIN e1 CROSS JOIN e2 CROSS JOIN e3"""
 
 
-@query("q454_haar_energy", _q454_oracle())
+@query("q454_haar_energy", _q454_oracle(), kind="operator")
 def q454(spark, sf_dir):
     """Orthonormal 2-D Haar energy compaction — the transform-coding
     analysis behind the wavelet raster formats the reference reads
@@ -27640,168 +10314,6 @@ def q454(spark, sf_dir):
     )
 
 
-# --- chrF machine-translation metric (q455) ------------------------------------------
-
-
-def _q455_sql(engine: str) -> str:
-    cat = "||" if engine == "duck" else ""
-    hyp_case = (
-        "CASE WHEN doc_id % 4 = 0 THEN text "
-        "WHEN doc_id % 4 = 1 THEN replace(text, 'e', '') "
-        "WHEN doc_id % 4 = 2 THEN concat(text, ' extra') "
-        "ELSE replace(text, 'a', 'q') END"
-    )
-    ctes = []
-    joins = []
-    outs = []
-    fparts = []
-    for n in (1, 2, 3):
-        for side, col in (("h", "hyp"), ("r", "ref")):
-            if engine == "duck":
-                grams = (f"unnest([substr({col}, i, {n}) "
-                         f"for i in range(1, length({col}) - {n} + 2)])")
-            else:
-                grams = (f"explode(CASE WHEN length({col}) >= {n} THEN "
-                         f"transform(sequence(1, length({col}) - {n} + 1), "
-                         f"i -> substring({col}, i, {n})) "
-                         f"ELSE array() END)")
-            ctes.append(
-                f"""{side}g{n} AS (SELECT doc_id, g, count(*) AS c{side}
-             FROM (SELECT doc_id, {grams} AS g FROM d) t{side}{n}
-             GROUP BY doc_id, g)"""
-            )
-        ctes.append(
-            f"""m{n} AS (SELECT h.doc_id,
-                  CAST(sum(least(ch, cr)) AS BIGINT) AS m
-             FROM hg{n} h JOIN rg{n} r
-               ON r.doc_id = h.doc_id AND r.g = h.g
-             GROUP BY h.doc_id)"""
-        )
-        joins.append(f"LEFT JOIN m{n} ON m{n}.doc_id = d.doc_id")
-        outs.append(
-            f"""CAST(coalesce(m{n}.m, 0) AS BIGINT) AS m{n},
-              CAST(CASE WHEN length(hyp) >= {n}
-                   THEN length(hyp) - {n} + 1 ELSE 0 END AS BIGINT) AS h{n},
-              CAST(CASE WHEN length(ref) >= {n}
-                   THEN length(ref) - {n} + 1 ELSE 0 END AS BIGINT) AS r{n},
-              CASE WHEN coalesce(m{n}.m, 0) > 0
-                   THEN 5.0 * CAST(m{n}.m AS DOUBLE)
-                        / CAST(4 * (length(ref) - {n} + 1)
-                               + (length(hyp) - {n} + 1) AS DOUBLE)
-                   ELSE 0.0 END AS f{n}"""
-        )
-        fparts.append(
-            f"""(CASE WHEN coalesce(m{n}.m, 0) > 0
-                   THEN 5.0 * CAST(m{n}.m AS DOUBLE)
-                        / CAST(4 * (length(ref) - {n} + 1)
-                               + (length(hyp) - {n} + 1) AS DOUBLE)
-                   ELSE 0.0 END)"""
-        )
-    nl = ",\n       "
-    return f"""WITH d AS (SELECT doc_id,
-                    replace({hyp_case}, ' ', '') AS hyp,
-                    replace(text, ' ', '') AS ref
-             FROM documents),
-       {nl.join(ctes)}
-       SELECT d.doc_id,
-              {", ".join(outs)},
-              ({" + ".join(fparts)}) / 3.0 AS chrf
-       FROM d {" ".join(joins)}"""
-
-
-@query("q455_chrf_score", _q455_sql("duck"))
-def q455(spark, sf_dir):
-    """chrF machine-translation metric (Popović 2015) — the
-    character-n-gram F-score joining the eval family (BLEU q414 is
-    word-level clipped precision, nDCG/MRR rank, chrF is the
-    tokenization-free MT standard): beta = 2, n = 1..3 over
-    whitespace-stripped text.  The whole metric stays ONE exact
-    division per n via the algebraic collapse F_beta=2 =
-    (1+4)PR/(4P+R) with P = m/h, R = m/r  =>  F = 5m/(4r+h) — the
-    clipped match count m (sum of per-gram min(hyp_count,
-    ref_count), an INNER join since absent grams contribute 0) and
-    the gram totals h, r are emitted as the BIGINT provenance of
-    every float.  Four planted hypothesis classes per doc_id % 4
-    (perfect copy / e-deletion / tail insertion / a-substitution)
-    give F = 1 exactly on class 0 and length-asymmetric h != r on
-    the deletion and insertion classes — the P-vs-R split a
-    substitution-only fixture would hide.  chrf = (f1+f2+f3)/3 in a
-    fixed left-to-right tree.  One gram explode + one bounded join
-    per n; gram counts are per-doc, never corpus-wide."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q455_docs")
-    return spark.sql(_q455_sql("spark").replace("FROM documents",
-                                                "FROM q455_docs"))
-
-
-# --- quorum-overlap replication planning (q456) --------------------------------------
-
-_Q456_GRID = []
-for _N in (3, 5, 9):
-    for _R, _W in ((1, 1), (1, _N), (_N // 2 + 1, _N // 2 + 1), (_N, 1)):
-        _Q456_GRID.append((_N, _R, _W))
-
-
-def _q456_sql(divop: str) -> str:
-    import math
-    from fractions import Fraction
-
-    rows = []
-    for n, r, w in _Q456_GRID:
-        stale_num = math.comb(n - w, r) if n - w >= r else 0
-        stale_den = math.comb(n, r)
-        p_avail = float(
-            Fraction(
-                sum(math.comb(n, k) * 255 ** k for k in range(r, n + 1)),
-                256 ** n,
-            )
-        )
-        rows.append(f"""SELECT CAST({n} AS BIGINT) AS n,
-              CAST({r} AS BIGINT) AS r,
-              CAST({w} AS BIGINT) AS w,
-              CAST({stale_num} AS BIGINT) AS stale_num,
-              CAST({stale_den} AS BIGINT) AS stale_den,
-              CAST({stale_num} AS DOUBLE) / CAST({stale_den} AS DOUBLE)
-                AS p_stale,
-              CAST(CASE WHEN {r} + {w} > {n} THEN 1 ELSE 0 END
-                AS BIGINT) AS strong,
-              CAST(CASE WHEN ({r} + {w} > {n})
-                        = ({stale_num} = 0) THEN 1 ELSE 0 END
-                AS BIGINT) AS overlap_theorem_ok,
-              CAST('{p_avail!r}' AS DOUBLE) AS p_read_avail,
-              CAST(ev.cnt * {stale_num} {divop} {stale_den} AS BIGINT)
-                AS stale_reads,
-              CAST(ev.cnt AS BIGINT) AS total_reads
-       FROM ev""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH ev AS (SELECT CAST(count(*) AS BIGINT) AS cnt
-                 FROM events)
-       {body}"""
-
-
-@query("q456_quorum_planning", _q456_sql("//"))
-def q456(spark, sf_dir):
-    """Quorum replication planning — the (N, R, W) read/write-set
-    arithmetic behind every Dynamo-style store the crawl corpus
-    would live in (the consistency counterpart to q447's durability
-    and q380's shuffle sharding): the probability a random R-read-set
-    misses a random W-write-set entirely is the EXACT RATIONAL
-    C(N-W, R)/C(N, R) (math.comb inlined, one division), and the
-    quorum-overlap theorem R+W > N <=> overlap-certain is EMITTED as
-    an integer equivalence proof on every row rather than assumed.
-    Read availability under per-replica uptime 255/256 is the exact
-    binomial tail sum_{k>=R} C(N,k) 255^k / 256^N, computed as an
-    arbitrary-precision Fraction in Python (256^9 overflows BIGINT)
-    and inlined verbatim via CAST('…' AS DOUBLE) per the
-    decimal-literal rule.  stale_reads ties each plan to the ACTUAL
-    event count by exact integer division.  The 12-row grid exposes
-    the tradeoff: (1,1) on N=9 is fastest but 81.5% stale-prone,
-    majority quorums are never stale at ~half the availability nines
-    of R=1.  One corpus scan; 12 plan rows."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q456_events")
-    return spark.sql(_q456_sql("div").replace("FROM events",
-                                              "FROM q456_events"))
-
-
 # --- video shot-boundary detection (q457) --------------------------------------------
 
 
@@ -27832,6 +10344,7 @@ def q456(spark, sf_dir):
               CAST(CASE WHEN (sad > 256) = (t % 8 = 0) THEN 1 ELSE 0 END
                 AS BIGINT) AS agree
        FROM sad""",
+    kind="operator",
 )
 def q457(spark, sf_dir):
     """Video shot-boundary detection — the frame-difference cut
@@ -27923,7 +10436,7 @@ def _q458_oracle(rounds: int = 6) -> str:
        JOIN span sp ON sp.lbl = l.lbl"""
 
 
-@query("q458_label_propagation", _q458_oracle())
+@query("q458_label_propagation", _q458_oracle(), kind="operator")
 def q458(spark, sf_dir):
     """Community detection by round-SYNCHRONOUS label propagation
     (Raghavan et al. 2007) — the near-linear community algorithm a
@@ -27994,69 +10507,6 @@ def q458(spark, sf_dir):
     )
 
 
-# --- all-reduce topology planning (q459) ---------------------------------------------
-
-_Q459_PS = (8, 64, 512)
-
-
-def _q459_sql(divop: str) -> str:
-    # every coefficient product is Python-precomputed: Spark ANSI
-    # folds integer LITERAL chains in INT32 and 2*511*5000*512
-    # overflows multiplyExact before the CAST is even seen (the q308
-    # ascii() lesson in constant-literal form)
-    rows = []
-    for p in _Q459_PS:
-        lg = p.bit_length() - 1
-        lat_ring = 2 * (p - 1) * 5000 * p
-        tf = 2 * lg * p
-        for tag in (0, 1):
-            if tag == 0:
-                vexpr = "CAST(16384 AS BIGINT)"
-                ring = f"CAST({2 * (p - 1) * 16384 + lat_ring} AS BIGINT)"
-                tree = f"CAST({tf * (16384 + 5000)} AS BIGINT)"
-            else:
-                vexpr = "CAST(4 * tok.t AS BIGINT)"
-                ring = (f"CAST({8 * (p - 1)} * tok.t + {lat_ring}"
-                        f" AS BIGINT)")
-                tree = f"CAST({4 * tf} * tok.t + {tf * 5000} AS BIGINT)"
-            rows.append(f"""SELECT CAST({p} AS BIGINT) AS p,
-              CAST({tag} AS BIGINT) AS big_msg,
-              {vexpr} AS v_bytes,
-              {ring} AS ring_xp,
-              {tree} AS tree_xp,
-              CAST({ring} AS DOUBLE) / CAST({p} AS DOUBLE) AS ring_ns,
-              CAST({tree} AS DOUBLE) / CAST({p} AS DOUBLE) AS tree_ns,
-              CAST(CASE WHEN {ring} < {tree} THEN 1 ELSE 0 END
-                AS BIGINT) AS ring_wins
-       FROM tok""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH tok AS (SELECT CAST(sum(n_chars) AS BIGINT) AS t
-                 FROM documents)
-       {body}"""
-
-
-@query("q459_allreduce_planning", _q459_sql("//"))
-def q459(spark, sf_dir):
-    """All-reduce topology planning — the ring-vs-tree decision every
-    data-parallel training job makes per bucket size (the
-    communication counterpart to q444's pipeline bubbles and q450's
-    checkpoint cadence): ring all-reduce moves 2(p-1)/p of the
-    payload per rank in 2(p-1) latency-bound steps, a binomial tree
-    moves the full payload 2*log2(p) times in as many steps.  Both
-    costs stay EXACT INTEGERS by carrying time*p in nanoseconds
-    (bw = 1 B/ns, latency 5000 ns, log2 p exact for power-of-2
-    ranks), the winner flag is a pure integer cross-multiplied
-    comparison, and the one double per topology is a single division
-    by p.  Gradient bytes tie to the ACTUAL corpus (4 bytes/char);
-    the 16 KiB row pins the latency-bound regime.  The 6-row grid
-    shows the real knee: ring wins every large-payload row, the tree
-    wins small messages at p >= 64 — why NCCL switches algorithms by
-    buffer size.  One corpus scan; six plan rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q459_docs")
-    return spark.sql(_q459_sql("div").replace("FROM documents",
-                                              "FROM q459_docs"))
-
-
 # --- Walsh-Hadamard perceptual hash dedup (q460) -------------------------------------
 
 
@@ -28102,6 +10552,7 @@ def q459(spark, sf_dir):
               c.class_hash_count
        FROM hsh h JOIN keep k ON k.hash15 = h.hash15
        JOIN cls c ON c.cls = h.doc_id % 40""",
+    kind="operator",
 )
 def q460(spark, sf_dir):
     """Walsh-Hadamard perceptual-hash dedup — the frequency-domain
@@ -28148,241 +10599,6 @@ def q460(spark, sf_dir):
     )
 
 
-# --- KV-cache serving capacity planning (q461) ---------------------------------------
-
-_Q461_GRID = []
-for _wb, _nl in ((28_000_000_000, 32), (140_000_000_000, 80)):
-    for _seq in (4096, 32768):
-        _Q461_GRID.append((_wb, _nl, _seq))
-
-
-def _q461_sql(divop: str) -> str:
-    hbm = 85_899_345_920  # 80 GiB
-    rows = []
-    for wb, nl, seq in _Q461_GRID:
-        kv_per_seq = 4096 * nl * seq  # 2 KV * fp16 * 128 dim * 8 heads
-        free = hbm - wb
-        batch = max(free, 0) // kv_per_seq
-        rows.append(f"""SELECT CAST({wb} AS BIGINT) AS weight_bytes,
-              CAST({nl} AS BIGINT) AS n_layers,
-              CAST({seq} AS BIGINT) AS seq_len,
-              CAST({kv_per_seq} AS BIGINT) AS kv_bytes_per_seq,
-              CAST({batch} AS BIGINT) AS max_batch,
-              CAST({batch * seq} AS BIGINT) AS tokens_in_flight,
-              CAST({1 if batch >= 1 else 0} AS BIGINT) AS fits,
-              CAST(CASE WHEN {batch * seq} > 0
-                   THEN (tok.t + {max(batch * seq, 1)} - 1)
-                        {divop} {max(batch * seq, 1)}
-                   ELSE -1 END AS BIGINT) AS corpus_loads
-       FROM tok""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH tok AS (SELECT CAST(sum(n_chars) AS BIGINT) AS t
-                 FROM documents)
-       {body}"""
-
-
-@query("q461_kv_cache_planning", _q461_sql("//"))
-def q461(spark, sf_dir):
-    """KV-cache serving capacity planning — the batch-size arithmetic
-    every LLM serving fleet runs before provisioning (the inference
-    counterpart to q450's checkpoint cadence and q451's speculative
-    decoding): on an 80 GiB device, concurrent sequences =
-    floor((HBM - weights) / (kv_bytes_per_token_layer * layers *
-    seq_len)) with the 4096 B/token/layer KV cost (2 tensors * fp16 *
-    128 head-dim * 8 KV heads) — every capacity, batch, and
-    tokens-in-flight column an EXACT INTEGER with all products
-    Python-precomputed (the q459 INT32-folding lesson), and the
-    corpus tie is the exact ceiling of actual corpus tokens over
-    tokens-in-flight (how many full pipeline drains serving the
-    corpus costs).  The grid exposes the two cliffs a capacity
-    planner must see: the 70B model does not fit at all (fits = 0,
-    weights alone exceed HBM) and 32k contexts cut the 7B model's
-    concurrency 8x.  One corpus scan; 4 plan rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q461_docs")
-    return spark.sql(_q461_sql("div").replace("FROM documents",
-                                              "FROM q461_docs"))
-
-
-# --- Theil-Sen robust trend vs OLS (q462) --------------------------------------------
-
-
-def _q462_sql(divop: str) -> str:
-    y = ("(3 + (2 + s) * x + ((x*x*7 + x*3 + s) % 7 - 3)"
-         " + (CASE WHEN x % 10 = 9 THEN 500 ELSE 0 END))")
-    return f"""WITH pts AS (SELECT DISTINCT event_id % 5 AS s,
-                    (event_id {divop} 5) % 20 AS x
-             FROM events),
-       xy AS (SELECT s, x, CAST({y} AS BIGINT) AS y FROM pts),
-       pr AS (SELECT a.s, CAST(b.y - a.y AS DOUBLE)
-                          / CAST(b.x - a.x AS DOUBLE) AS slope
-              FROM xy a JOIN xy b ON b.s = a.s AND b.x > a.x),
-       rk AS (SELECT s, slope,
-                     row_number() OVER (PARTITION BY s
-                                        ORDER BY slope) AS rnk,
-                     count(*) OVER (PARTITION BY s) AS n_pairs
-              FROM pr),
-       ts AS (SELECT s, slope AS ts_slope,
-                     CAST(n_pairs AS BIGINT) AS n_pairs
-              FROM rk WHERE rnk = (n_pairs + 1) {divop} 2),
-       ols AS (SELECT s,
-                 CAST(count(*) * sum(x*y) - sum(x) * sum(y) AS BIGINT)
-                   AS ols_num,
-                 CAST(count(*) * sum(x*x) - sum(x) * sum(x) AS BIGINT)
-                   AS ols_den
-               FROM xy GROUP BY s)
-       SELECT ts.s, ts.ts_slope, ts.n_pairs, ols.ols_num, ols.ols_den,
-              CAST(ols.ols_num AS DOUBLE) / CAST(ols.ols_den AS DOUBLE)
-                AS ols_slope,
-              ts.ts_slope - CAST(2 + ts.s AS DOUBLE) AS ts_err,
-              CAST(ols.ols_num AS DOUBLE) / CAST(ols.ols_den AS DOUBLE)
-                - CAST(2 + ts.s AS DOUBLE) AS ols_err
-       FROM ts JOIN ols ON ols.s = ts.s"""
-
-
-@query("q462_theil_sen", _q462_sql("//"))
-def q462(spark, sf_dir):
-    """Theil-Sen robust trend vs OLS — the estimator a crawl-metric
-    dashboard needs when 10% of points are garbage (q271's raster
-    trend and q319's seasonal outliers assume clean series; this is
-    the 29%-breakdown-point alternative): the TS slope is the MEDIAN
-    of all pairwise slopes, which stays EXACT cross-engine because
-    each slope is one division of small exact integers (distinct
-    rationals with denominators < 2^20 cannot collide in a double,
-    so the sort key is faithful) and the median is pinned as the
-    value at rank (n+1) div 2 — an order statistic, tie-order
-    independent.  Five 20-point series with slopes 2..6, bounded
-    +-3 noise, and two planted +500 outliers each (10%
-    contamination): ts_err stays within the noise band on every
-    series while ols_err (numerator/denominator emitted as exact
-    BIGINTs, one division) is dragged ~6.8 units — the breakdown
-    the median survives and the mean does not, measured not
-    claimed.  Pairs are per-series (190 each), never corpus-wide."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q462_events")
-    return spark.sql(_q462_sql("div").replace("FROM events",
-                                              "FROM q462_events"))
-
-
-# --- Shapley-value conversion attribution (q463) -------------------------------------
-
-
-def _q463_sql(divop: str) -> str:
-    # v(S) for S a bitmask over channels A=1, B=2, C=4
-    vs = {
-        S: f"""(SELECT CAST(coalesce(sum(CASE WHEN (m & {7 - S}) = 0
-                    THEN conv ELSE 0 END), 0) AS BIGINT) FROM mc)"""
-        for S in range(8)
-    }
-    phi6 = {
-        "a": f"(2*(v1.v - v0.v) + (v3.v - v2.v) + (v5.v - v4.v)"
-             f" + 2*(v7.v - v6.v))",
-        "b": f"(2*(v2.v - v0.v) + (v3.v - v1.v) + (v6.v - v4.v)"
-             f" + 2*(v7.v - v5.v))",
-        "c": f"(2*(v4.v - v0.v) + (v5.v - v1.v) + (v6.v - v2.v)"
-             f" + 2*(v7.v - v3.v))",
-    }
-    vjoin = " CROSS JOIN ".join(
-        f"(SELECT {vs[S]} AS v) v{S}" for S in range(8))
-    return f"""WITH j AS (SELECT DISTINCT event_id {divop} 8 AS jid
-             FROM events),
-       mask AS (SELECT jid,
-                    (CASE WHEN jid % 2 = 0 THEN 1 ELSE 0 END)
-                  + (CASE WHEN jid % 3 = 0 THEN 2 ELSE 0 END)
-                  + (CASE WHEN jid % 5 = 0 THEN 4 ELSE 0 END) AS m,
-                    CASE WHEN (jid*jid + 3*jid) % 7 < 3 THEN 1 ELSE 0 END
-                      AS conv
-             FROM j),
-       mc AS (SELECT m, CAST(sum(conv) AS BIGINT) AS conv
-              FROM mask GROUP BY m)
-       SELECT CAST({phi6['a']} AS BIGINT) AS phi6_a,
-              CAST({phi6['b']} AS BIGINT) AS phi6_b,
-              CAST({phi6['c']} AS BIGINT) AS phi6_c,
-              CAST({phi6['a']} AS DOUBLE) / 6.0 AS phi_a,
-              CAST({phi6['b']} AS DOUBLE) / 6.0 AS phi_b,
-              CAST({phi6['c']} AS DOUBLE) / 6.0 AS phi_c,
-              CAST(v7.v AS BIGINT) AS v_all,
-              CAST(v0.v AS BIGINT) AS v_none,
-              CAST({phi6['a']} + {phi6['b']} + {phi6['c']}
-                   - 6 * (v7.v - v0.v) AS BIGINT) AS efficiency_resid
-       FROM {vjoin}"""
-
-
-@query("q463_shapley_attribution", _q463_sql("//"))
-def q463(spark, sf_dir):
-    """Shapley-value conversion attribution — the game-theoretic
-    answer to q334's last-touch heuristic (which channel DESERVES
-    the conversion): with 3 channels the Shapley value collapses to
-    a fixed integer combination, 6*phi_A = 2[v(A)-v(0)] +
-    [v(AB)-v(B)] + [v(AC)-v(C)] + 2[v(ABC)-v(BC)], so every phi is
-    an EXACT INTEGER sextuple with ONE division at the end.  The
-    coalition function v(S) = conversions achievable using only
-    channels in S comes from the data (one conversions-per-touchmask
-    groupBy, 8 cells, then subset sums via bitmask CASE — never a
-    per-permutation scan), and the Shapley EFFICIENCY axiom
-    sum(phi) = v(all) - v(none) is EMITTED as a x6 integer residual
-    == 0 rather than trusted.  Touch masks and conversions derive
-    from journey ids by coprime moduli (2, 3, 5 — all 8 masks
-    populated, conversion rate 3/7).  One scan to the 8-cell mask
-    table; the Shapley algebra is constant-size."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q463_events")
-    return spark.sql(_q463_sql("div").replace("FROM events",
-                                              "FROM q463_events"))
-
-
-# --- Dorfman pooled-testing audit planning (q464) ------------------------------------
-
-
-def _q464_sql(divop: str) -> str:
-    from fractions import Fraction
-
-    rows = []
-    best_s, best_t = None, None
-    plans = {}
-    for s in range(2, 13):
-        t = Fraction(1, s) + 1 - Fraction(15, 16) ** s
-        plans[s] = t
-        if best_t is None or t < best_t:
-            best_s, best_t = s, t
-    for s, t in plans.items():
-        rows.append(f"""SELECT CAST({s} AS BIGINT) AS pool_size,
-              CAST({t.numerator} AS BIGINT) AS t_num,
-              CAST({t.denominator} AS BIGINT) AS t_den,
-              CAST({t.numerator} AS DOUBLE)
-                / CAST({t.denominator} AS DOUBLE) AS tests_per_doc,
-              CAST(CASE WHEN {t.numerator} < {t.denominator}
-                   THEN 1 ELSE 0 END AS BIGINT) AS beats_individual,
-              CAST({1 if s == best_s else 0} AS BIGINT) AS is_optimal,
-              CAST(n.n * {t.numerator * 10000 // t.denominator}
-                   {divop} 10000 AS BIGINT) AS expected_tests_lb,
-              CAST((n.n * {t.numerator} + {t.denominator} - 1)
-                   {divop} {t.denominator} AS BIGINT) AS expected_tests
-       FROM n""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n
-                 FROM documents)
-       {body}"""
-
-
-@query("q464_pooled_testing", _q464_sql("//"))
-def q464(spark, sf_dir):
-    """Dorfman pooled-testing audit planning — the group-testing
-    arithmetic that decides how to QC-sample a corpus when each
-    check is expensive (a human audit, an expensive classifier):
-    pool s docs, test the pool, retest individually only on a hit.
-    Expected tests per doc T(s) = 1/s + 1 - (1-p)^s stays an EXACT
-    RATIONAL at dyadic prevalence p = 1/16 ((15/16)^s via
-    Python-Fraction arithmetic, numerator/denominator inlined as
-    BIGINTs, ONE division for the float), the beats-individual gate
-    is the pure integer comparison t_num < t_den, and the optimum
-    (s = 5 at this prevalence, near the 1/sqrt(p) rule of thumb) is
-    marked from the same exact fractions.  expected_tests ties every
-    plan to the ACTUAL corpus count via the exact ceiling idiom —
-    the audit bill at s = 5 is ~48% of testing every doc.  One
-    corpus scan; 11 plan rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q464_docs")
-    return spark.sql(_q464_sql("div").replace("FROM documents",
-                                              "FROM q464_docs"))
-
-
 # --- Burrows-Wheeler transform + run structure (q465) --------------------------------
 
 
@@ -28409,6 +10625,7 @@ def q464(spark, sf_dir):
               CAST(sm.n_runs AS DOUBLE) / CAST(sm.n_chars AS DOUBLE)
                 AS runs_ratio
        FROM bd CROSS JOIN sm""",
+    kind="operator",
 )
 def q465(spark, sf_dir):
     """Burrows-Wheeler transform + run structure — the missing third
@@ -28503,7 +10720,7 @@ def _q466_oracle() -> str:
        WHERE d.gx BETWEEN 2 AND 125 AND d.gy BETWEEN 2 AND 125"""
 
 
-@query("q466_d8_flow", _q466_oracle())
+@query("q466_d8_flow", _q466_oracle(), kind="operator")
 def q466(spark, sf_dir):
     """D8 steepest-descent flow direction + local inflow — the
     hydrology primitive on top of the gdaldem stencil family
@@ -28542,381 +10759,10 @@ def q466(spark, sf_dir):
     )
 
 
-# --- join-cardinality estimation audit (q467) ----------------------------------------
-
-
-def _q467_sql(divop: str) -> str:
-    scen = {
-        "uniform": ("event_id % 40", "doc_id % 40"),
-        "skewed": ("CASE WHEN event_id % 5 < 3 THEN 0 ELSE event_id % 40 END",
-                   "CASE WHEN doc_id % 5 < 3 THEN 0 ELSE doc_id % 40 END"),
-    }
-    rows = []
-    for name, (ek, dk) in scen.items():
-        rows.append(f"""SELECT '{name}' AS scenario,
-              a.n_a, a.d_a, b.n_b, b.d_b,
-              CAST(a.n_a * b.n_b AS BIGINT) AS est_num,
-              CAST(CASE WHEN a.d_a > b.d_b THEN a.d_a ELSE b.d_b END
-                AS BIGINT) AS est_den,
-              CAST(a.n_a * b.n_b AS DOUBLE)
-                / CAST(CASE WHEN a.d_a > b.d_b THEN a.d_a ELSE b.d_b END
-                       AS DOUBLE) AS est_rows,
-              x.actual,
-              CAST(x.actual AS DOUBLE)
-                * CAST(CASE WHEN a.d_a > b.d_b THEN a.d_a ELSE b.d_b END
-                       AS DOUBLE)
-                / CAST(a.n_a * b.n_b AS DOUBLE) AS actual_over_est
-       FROM (SELECT CAST(count(*) AS BIGINT) AS n_a,
-                    CAST(count(DISTINCT {ek}) AS BIGINT) AS d_a
-             FROM events) a
-       CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS n_b,
-                          CAST(count(DISTINCT {dk}) AS BIGINT) AS d_b
-                   FROM documents) b
-       CROSS JOIN (SELECT CAST(sum(ca.c * cb.c) AS BIGINT) AS actual
-                   FROM (SELECT {ek} AS k, count(*) AS c FROM events
-                         GROUP BY {ek}) ca
-                   JOIN (SELECT {dk} AS k, count(*) AS c FROM documents
-                         GROUP BY {dk}) cb ON cb.k = ca.k) x""")
-    return " UNION ALL ".join(rows)
-
-
-@query("q467_join_cardinality_audit", _q467_sql("//"))
-def q467(spark, sf_dir):
-    """Join-cardinality estimation audit — the System-R formula
-    |A JOIN B| ~ n_A n_B / max(d_A, d_B) measured against ground
-    truth (the arithmetic q390's join-order planner TRUSTS; this
-    query shows when that trust breaks, which is why AQE re-plans at
-    runtime): the estimate is an exact integer ratio (est_num /
-    est_den, one division) and the ACTUAL join size comes from
-    sum(cnt_A(k) * cnt_B(k)) over the two per-key histograms — the
-    exact size WITHOUT materializing the join, two groupBys and a
-    40-key equi-join.  Two planted key distributions on the same
-    tables: uniform (events % 40 — the estimator lands within ~2%)
-    and skewed (60% of BOTH sides on key 0 — actual blows past the
-    estimate ~6.3x; skew on one side alone leaves the join size
-    unchanged, which the first cut measured as ratio 1.02 before the
-    fixture was fixed — correlated hot keys are what break the
-    independence assumption).  actual_over_est is
-    the audit number a planner regression suite tracks.  Histogram
-    sizes are key-domain bounded, never row-scale."""
-    for t in ("events", "documents"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"q467_{t}")
-    return spark.sql(
-        _q467_sql("div")
-        .replace("FROM events", "FROM q467_events")
-        .replace("FROM documents", "FROM q467_documents")
-    )
-
-
-# --- Reed-Solomon P+Q erasure coding + reconstruction proof (q468) --------------------
-
-
-def _gf_tables():
-    """GF(2^8) log/exp tables, generator 2, polynomial 0x11d — the
-    RAID-6 field (public arithmetic, Python-precomputed once and
-    inlined/broadcast identically in both engines)."""
-    exp = [0] * 255
-    log = [0] * 256
-    x = 1
-    for i in range(255):
-        exp[i] = x
-        log[x] = i
-        x <<= 1
-        if x & 0x100:
-            x ^= 0x11D
-    return log, exp
-
-
-def _q468_sql(engine: str) -> str:
-    log, exp = _gf_tables()
-    logv = ", ".join(f"({v}, {log[v]})" for v in range(1, 256))
-    expv = ", ".join(f"({i}, {exp[i]})" for i in range(255))
-    if engine == "duck":
-        luts = f"lg(v, l) AS (VALUES {logv}), ex(i, v) AS (VALUES {expv})"
-        grid = "FROM documents CROSS JOIN range(4) si CROSS JOIN range(16) ps"
-        icol, pcol = "si.range", "ps.range"
-        sub = "substr"
-
-        def x2(a, b):
-            return f"xor({a}, {b})"
-    else:
-        luts = (f"lg AS (SELECT * FROM VALUES {logv} AS t(v, l)), "
-                f"ex AS (SELECT * FROM VALUES {expv} AS t(i, v))")
-        grid = ("FROM documents "
-                "LATERAL VIEW explode(sequence(0, 3)) t1 AS si "
-                "LATERAL VIEW explode(sequence(0, 15)) t2 AS ps")
-        icol, pcol = "si", "ps"
-        sub = "substring"
-
-        def x2(a, b):
-            return f"(({a}) ^ ({b}))"
-
-    asc = (f"CAST(ascii({sub}(rpad(text, 64, 'x'), "
-           f"CAST({icol}*16 + {pcol} + 1 AS INT), 1)) AS BIGINT)")
-    return f"""WITH {luts},
-       b AS (SELECT doc_id, {icol} AS i, {pcol} AS pos, {asc} AS d
-             {grid}),
-       qt AS (SELECT b.doc_id, b.i, b.pos,
-                     CASE WHEN b.d = 0 THEN 0 ELSE ex.v END AS qd
-              FROM b
-              LEFT JOIN lg ON lg.v = b.d
-              LEFT JOIN ex ON ex.i = (lg.l + b.i) % 255),
-       p AS (SELECT doc_id, pos, bit_xor(d) AS pv
-             FROM b GROUP BY doc_id, pos),
-       q AS (SELECT doc_id, pos, bit_xor(qd) AS qv
-             FROM qt GROUP BY doc_id, pos),
-       sp AS (SELECT b.doc_id, b.pos, bit_xor(b.d) AS sv
-              FROM b WHERE b.i <> b.doc_id % 4 GROUP BY b.doc_id, b.pos),
-       sq AS (SELECT qt.doc_id, qt.pos, bit_xor(qt.qd) AS sv
-              FROM qt WHERE qt.i <> qt.doc_id % 4
-              GROUP BY qt.doc_id, qt.pos),
-       orig AS (SELECT b.doc_id, b.pos, b.d AS d_orig
-                FROM b WHERE b.i = b.doc_id % 4),
-       rec AS (SELECT o.doc_id, o.pos, o.d_orig,
-                      {x2("p.pv", "sp.sv")} AS recon_p,
-                      {x2("q.qv", "sq.sv")} AS ge
-               FROM orig o
-               JOIN p ON p.doc_id = o.doc_id AND p.pos = o.pos
-               JOIN q ON q.doc_id = o.doc_id AND q.pos = o.pos
-               JOIN sp ON sp.doc_id = o.doc_id AND sp.pos = o.pos
-               JOIN sq ON sq.doc_id = o.doc_id AND sq.pos = o.pos),
-       rq AS (SELECT r.doc_id, r.pos, r.d_orig, r.recon_p,
-                     CASE WHEN r.ge = 0 THEN 0 ELSE ex2.v END AS recon_q
-              FROM rec r
-              LEFT JOIN lg lg2 ON lg2.v = r.ge
-              LEFT JOIN ex ex2
-                ON ex2.i = (lg2.l + 255 - r.doc_id % 4) % 255)
-       SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-              CAST(d_orig AS BIGINT) AS d_orig,
-              CAST(recon_p AS BIGINT) AS recon_p,
-              CAST(recon_q AS BIGINT) AS recon_q,
-              CAST(CASE WHEN recon_p = d_orig THEN 1 ELSE 0 END AS BIGINT)
-                AS ok_p,
-              CAST(CASE WHEN recon_q = d_orig THEN 1 ELSE 0 END AS BIGINT)
-                AS ok_q
-       FROM rq"""
-
-
-@query("q468_reed_solomon_pq", _q468_sql("duck"))
-def q468(spark, sf_dir):
-    """Reed-Solomon P+Q erasure CODING with a two-path reconstruction
-    proof — q447 planned RS durability; this op actually ENCODES and
-    RECOVERS (the RAID-6 arithmetic a 100-TB store runs on every
-    stripe write): 4 data shards of 16 bytes per document stripe,
-    P = XOR of the shards, Q = XOR of gf_mul(2^i, d_i) in GF(2^8)
-    poly 0x11d — the field multiply is a LOG/EXP table walk, both
-    255-row tables Python-generated once and joined (broadcast on
-    the engine side, the q148 ADC-LUT shape; correlated scalar
-    lookups in the oracle).  A planted single erasure (shard
-    doc_id % 4) is then reconstructed TWICE independently — from P
-    by XOR of survivors, from Q by the survivor Q-sum times
-    inv(2^e) = g^(255-e) — and BOTH equal-to-original flags are
-    EMITTED per byte (ok_p = ok_q = 1 on all 8000 rows): the
-    dual-syndrome identity that makes RAID-6 two-erasure decoding
-    work, verified byte-for-byte.  bit_xor is the aggregate on both
-    engines; every value is an exact small integer."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q468_docs")
-    return spark.sql(_q468_sql("spark").replace("FROM documents",
-                                                "FROM q468_docs"))
-
-
-# --- randomized-response local-DP estimation (q469) -----------------------------------
-
-
-def _q469_sql(divop: str) -> str:
-    import math
-
-    eps = repr(math.log(3.0))
-    h8 = ("CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT)"
-          if divop == "//"
-          else "CAST(conv(substr(md5(text), 1, 8), 16, 10) AS BIGINT)")
-    return f"""WITH d AS (SELECT doc_id,
-                    CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS b,
-                    {h8} % 2 AS c1,
-                    ({h8} {divop} 2) % 2 AS c2
-             FROM documents),
-       r AS (SELECT doc_id, b,
-                    CASE WHEN c1 = 1 THEN c2 ELSE b END AS resp
-             FROM d),
-       agg AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                      CAST(sum(resp) AS BIGINT) AS obs,
-                      CAST(sum(b) AS BIGINT) AS truth
-               FROM r)
-       SELECT n, obs, truth,
-              CAST(4 * obs - n AS BIGINT) AS est_x2,
-              CAST(4 * obs - n AS DOUBLE) / 2.0 AS est,
-              CAST(4 * obs - n AS DOUBLE) / 2.0 - CAST(truth AS DOUBLE)
-                AS err,
-              CAST('{eps}' AS DOUBLE) AS epsilon
-       FROM agg"""
-
-
-@query("q469_randomized_response", _q469_sql("//"))
-def q469(spark, sf_dir):
-    """Randomized-response local differential privacy — the
-    client-side mechanism complementing q405's central-DP geometric
-    release (Warner 1965 / RAPPOR's core): each doc reports its
-    sensitive bit truthfully only when its first hash coin says so
-    (f = 1/2), otherwise reports a second hash coin, so no single
-    response reveals the bit (epsilon = ln 3, the constant inlined
-    verbatim as a Python repr — a transcendental CONSTANT, not a
-    computed transcendental).  The unbiased estimator inverts the
-    mechanism EXACTLY in integers: E[obs] = n/4 + truth/2 =>
-    truth_est = (4*obs - n)/2, emitted as the integer est_x2 plus
-    ONE division; err measures the hash-coin sampling noise against
-    the exact ground-truth count carried in the same row (sd ~
-    2*sqrt(3n)/4 ~ 19 at n = 500; measured 0 and -16 at the two
-    SFs — inside one sd).  Both coins derive from the SAME
-    md5 the fixtures share — deterministic on both engines, no RNG.
-    One corpus scan, one row out."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q469_docs")
-    return spark.sql(_q469_sql("div").replace("FROM documents",
-                                              "FROM q469_docs"))
-
-
 # --- token-bucket admission replay (q470) --------------------------------------------
 
 _Q470_CAP = 90000   # token-seconds (5 tokens x 18000 s)
 _Q470_COST = 18000  # token-seconds per admitted request
-
-
-def _q470_oracle() -> str:
-    return f"""WITH RECURSIVE ev AS MATERIALIZED (
-         SELECT user_id % 5 AS host,
-                row_number() OVER (PARTITION BY user_id % 5
-                                   ORDER BY ts, event_id) AS rn,
-                CAST(floor(epoch(ts)) AS BIGINT)
-                - lag(CAST(floor(epoch(ts)) AS BIGINT), 1, 0)
-                  OVER (PARTITION BY user_id % 5
-                        ORDER BY ts, event_id) AS gap
-         FROM events),
-       tb(host, rn, gap, avail, admit, tok) AS (
-         SELECT host, rn, CAST(0 AS BIGINT), CAST({_Q470_CAP} AS BIGINT),
-                CAST(1 AS BIGINT),
-                CAST({_Q470_CAP - _Q470_COST} AS BIGINT)
-         FROM ev WHERE rn = 1
-         UNION ALL
-         SELECT e.host, e.rn, e.gap,
-                least({_Q470_CAP}, tb.tok + e.gap),
-                CASE WHEN least({_Q470_CAP}, tb.tok + e.gap)
-                     >= {_Q470_COST} THEN 1 ELSE 0 END,
-                least({_Q470_CAP}, tb.tok + e.gap)
-                - {_Q470_COST} * (CASE WHEN least({_Q470_CAP},
-                                       tb.tok + e.gap) >= {_Q470_COST}
-                                  THEN 1 ELSE 0 END)
-         FROM tb JOIN ev e ON e.host = tb.host AND e.rn = tb.rn + 1),
-       adm AS (SELECT host, CAST(sum(admit) AS BIGINT) AS admitted,
-                      CAST(count(*) AS BIGINT) AS total
-               FROM tb GROUP BY host)
-       SELECT tb.host, CAST(tb.rn AS BIGINT) AS rn, tb.gap, tb.avail,
-              tb.admit, tb.tok, a.admitted, a.total
-       FROM tb JOIN adm a ON a.host = tb.host"""
-
-
-@query("q470_token_bucket", _q470_oracle())
-def q470(spark, sf_dir):
-    """Token-bucket admission replay — the politeness rate limiter a
-    crawler ENFORCES per host (q252's frontier schedule plans the
-    order; this replays the actual admit/reject decisions, the
-    standard cell-rate algorithm): bucket capacity 90000 token-sec
-    (5 requests burst), refill 1 token-sec per elapsed second, cost
-    18000 per admitted request, all EXACT INTEGERS in token-seconds
-    so no fractional refill ever appears (the first cut's 600-sec
-    cost never bound against the fixture's 900-9000 s median gaps —
-    zero rejects, the degenerate-knob inspection caught it; 18000
-    rejects ~29% at sf0.001 and ~93% at sf0.01 with both classes
-    plentiful at both SFs).  The recurrence tok_i =
-    min(cap, tok_{i-1} + gap_i) - cost*admit_i is genuinely
-    SEQUENTIAL per host — the legit per-partition imperative case:
-    the engine runs one applyInPandas pass per host partition
-    (ordered by (ts, event_id), the q317 epoch-cast contract for
-    integer gaps), and the oracle replays the same recurrence as a
-    WITH RECURSIVE iteration keyed (host, rn) — UNION ALL, the q309
-    dedup trap does not arise.  Per-host admitted/total ride along;
-    per-host admitted/total ride along."""
-    import pandas as pd
-
-    ev = _t(spark, sf_dir, "events").selectExpr(
-        "user_id % 5 AS host", "event_id",
-        "unix_timestamp(ts) AS es", "ts")
-
-    def replay(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        es = pdf["es"].to_numpy()
-        n = len(es)
-        out = {"host": [int(key[0])] * n, "rn": [], "gap": [],
-               "avail": [], "admit": [], "tok": []}
-        tok = 0
-        for i in range(n):
-            gap = int(es[i] - es[i - 1]) if i else 0
-            if i == 0:
-                avail = _Q470_CAP
-            else:
-                avail = min(_Q470_CAP, tok + gap)
-            admit = 1 if avail >= _Q470_COST else 0
-            tok = avail - _Q470_COST * admit
-            out["rn"].append(i + 1)
-            out["gap"].append(gap if i else 0)
-            out["avail"].append(avail)
-            out["admit"].append(admit)
-            out["tok"].append(tok)
-        return pd.DataFrame(out)
-
-    tb = ev.groupBy("host").applyInPandas(
-        replay,
-        "host long, rn long, gap long, avail long, admit long, tok long",
-    )
-    adm = tb.groupBy("host").agg(
-        F.sum("admit").cast("long").alias("admitted"),
-        F.count("*").cast("long").alias("total"))
-    return tb.join(adm, "host")
-
-
-# --- off-policy replay evaluation (q471) ---------------------------------------------
-
-
-def _q471_sql(divop: str) -> str:
-    scen = {"aligned": "x % 3", "misaligned": "(x + 1) % 3"}
-    rows = []
-    for name, pi in scen.items():
-        rows.append(f"""SELECT '{name}' AS policy,
-              CAST(count(*) AS BIGINT) AS matches,
-              CAST(sum(r) AS BIGINT) AS clicks,
-              CAST(sum(r) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-                AS est_ctr,
-              (SELECT CAST(sum(r) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-               FROM lo) AS logged_ctr
-       FROM lo WHERE a = {pi}""")
-    return f"""WITH lo AS (SELECT user_id % 4 AS x, event_id % 3 AS a,
-                    CASE WHEN event_id % 3 = (user_id % 4) % 3
-                         THEN (CASE WHEN event_id % 10 < 4
-                               THEN 1 ELSE 0 END)
-                         ELSE (CASE WHEN event_id % 10 < 1
-                               THEN 1 ELSE 0 END)
-                    END AS r
-             FROM events)
-       {" UNION ALL ".join(rows)}"""
-
-
-@query("q471_policy_replay", _q471_sql("//"))
-def q471(spark, sf_dir):
-    """Off-policy replay evaluation (Li et al. 2011) — how a ranking
-    team scores a NEW policy on LOGGED data before any A/B test (the
-    counterfactual companion to q373's position-bias CTR and q204's
-    importance weights): under a uniform logging policy, the replay
-    estimator keeps only impressions where the logged action equals
-    the candidate policy's action and averages their rewards —
-    unbiased, and here EXACT: matches and clicks are integer counts,
-    est_ctr is ONE division.  The planted reward model pays 0.4 when
-    the action matches the context's best arm and 0.1 otherwise, so
-    the aligned policy replays ~0.4, the misaligned ~0.1, and both
-    straddle the ~0.2 logged baseline carried in every row — the
-    separation that tells a team the new policy is worth an
-    experiment.  One scan, two policy rows; the match filter is a
-    WHERE, never a join."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q471_events")
-    return spark.sql(_q471_sql("div").replace("FROM events",
-                                              "FROM q471_events"))
 
 
 # --- Boruvka minimum spanning tree / single-link backbone (q472) ----------------------
@@ -28934,6 +10780,7 @@ _Q472_P = "(100 * (i // 8) + 7 * (i % 8) + (i * i) % 5)"
                FROM p a JOIN p b ON b.i = a.i + 1),
        tot AS (SELECT CAST(sum(w) AS BIGINT) AS mst_total FROM mst)
        SELECT u, v, w, tot.mst_total FROM mst CROSS JOIN tot""",
+    kind="operator",
 )
 def q472(spark, sf_dir):
     """Borůvka minimum spanning tree — the distributed single-link
@@ -28999,7 +10846,7 @@ def _q473_oracle() -> str:
        FROM m WHERE rn = 1"""
 
 
-@query("q473_focal_majority", _q473_oracle())
+@query("q473_focal_majority", _q473_oracle(), kind="operator")
 def q473(spark, sf_dir):
     """Focal majority (mode) filter — the classification smoother a
     land-cover pipeline runs after per-pixel classification (the
@@ -29048,224 +10895,6 @@ def q473(spark, sf_dir):
         (F.col("v").cast("long") / 16).cast("long").alias("mode_class"),
         (F.col("v").cast("long") % 16).alias("mode_count"),
     )
-
-
-# --- Kneser-Ney smoothed bigram LM (q474) --------------------------------------------
-
-
-@query(
-    "q474_kneser_ney",
-    """WITH s AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-                  FROM documents),
-       chk AS (SELECT CASE WHEN max(len(w)) > 199
-                      THEN error('q474 oracle range(1,200) bound exceeded')
-                      ELSE 1 END AS ok FROM s),
-       bgr AS (SELECT w[r.range] AS x, w[r.range + 1] AS y
-               FROM s, range(1, 200) r
-               WHERE r.range <= len(w) - 1
-                 AND w[r.range] <> '' AND w[r.range + 1] <> ''),
-       c2 AS (SELECT x, y, CAST(count(*) AS BIGINT) AS c2
-              FROM bgr GROUP BY x, y),
-       c1 AS (SELECT x, CAST(sum(c2) AS BIGINT) AS c1,
-                     CAST(count(*) AS BIGINT) AS nv
-              FROM c2 GROUP BY x),
-       nw AS (SELECT y, CAST(count(*) AS BIGINT) AS nw
-              FROM c2 GROUP BY y),
-       b AS (SELECT CAST(count(*) AS BIGINT) AS b FROM c2),
-       rows_ AS (SELECT c2.x, c2.y, c2.c2, c1.c1, c1.nv, nw.nw, b.b,
-                      CAST(b.b * (4 * c2.c2 - 3) + 3 * c1.nv * nw.nw
-                        AS BIGINT) AS p_num,
-                      CAST(4 * c1.c1 * b.b AS BIGINT) AS p_den
-               FROM c2 JOIN c1 ON c1.x = c2.x
-               JOIN nw ON nw.y = c2.y CROSS JOIN b),
-       nrm AS (SELECT x, CAST(sum(p_num) AS BIGINT) AS s_num,
-                      CAST(sum(nw) AS BIGINT) AS s_nw
-               FROM rows_ GROUP BY x)
-       SELECT r.x, r.y, r.c2, r.c1, r.nv, r.nw, r.b, r.p_num, r.p_den,
-              CAST(r.p_num AS DOUBLE) / CAST(r.p_den AS DOUBLE) AS p,
-              CAST(r.p_den - n.s_num - 3 * r.nv * (r.b - n.s_nw)
-                AS BIGINT) AS norm_resid
-       FROM rows_ r JOIN nrm n ON n.x = r.x, chk""",
-)
-def q474(spark, sf_dir):
-    """Kneser-Ney smoothed bigram LM table — the modern-smoothing
-    counterpart to q297's Katz-style backoff surprisal (KN is what
-    every n-gram LM since 1995 actually ships): with dyadic discount
-    d = 3/4 the whole distribution stays EXACT-RATIONAL,
-    P(y|x) = (c2 - 3/4)/c1 + (3 nv / 4 c1)(nw / B) collapsing over
-    the common denominator to p_num/p_den = (B(4 c2 - 3) +
-    3 nv nw) / (4 c1 B) — integer numerators, ONE division; the
-    continuation counts nv = N1+(x.) and nw = N1+(.y) are the
-    KN insight (how many CONTEXTS a word completes, not how often).
-    The normalization proof is DATA-DEPENDENT, not algebraic: per
-    context x, the sum of emitted seen-pair masses PLUS the unseen
-    mass 3 nv (B - sum of seen nw) must equal p_den — a missing or
-    double-counted bigram row breaks resid == 0, so green certifies
-    the row set itself.  Counts are vocab-bounded groupBys; the
-    unigram sides broadcast in the engine plan."""
-    s = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower("text"), " ").alias("w"))
-    bgr = s.select(
-        F.explode(
-            F.expr("filter(transform(sequence(1, size(w) - 1), "
-                   "i -> struct(w[i - 1] AS x, w[i] AS y)), "
-                   "p -> p.x <> '' AND p.y <> '')")
-        ).alias("p")
-    ).select("p.x", "p.y")
-    c2 = bgr.groupBy("x", "y").agg(F.count("*").cast("long").alias("c2"))
-    c1 = c2.groupBy("x").agg(F.sum("c2").cast("long").alias("c1"),
-                             F.count("*").cast("long").alias("nv"))
-    nw = c2.groupBy("y").agg(F.count("*").cast("long").alias("nw"))
-    b = c2.agg(F.count("*").cast("long").alias("b"))
-    rows = (
-        c2.join(F.broadcast(c1), "x")
-        .join(F.broadcast(nw), "y")
-        .crossJoin(F.broadcast(b))
-        .withColumn("p_num", (F.col("b") * (4 * F.col("c2") - 3)
-                              + 3 * F.col("nv") * F.col("nw"))
-                    .cast("long"))
-        .withColumn("p_den", (4 * F.col("c1") * F.col("b")).cast("long"))
-    )
-    nrm = rows.groupBy(F.col("x").alias("nx")).agg(
-        F.sum("p_num").cast("long").alias("s_num"),
-        F.sum("nw").cast("long").alias("s_nw"))
-    return (
-        rows.join(F.broadcast(nrm), rows.x == nrm.nx)
-        .select(
-            "x", "y", "c2", "c1", "nv", "nw", "b", "p_num", "p_den",
-            (F.col("p_num").cast("double")
-             / F.col("p_den").cast("double")).alias("p"),
-            (F.col("p_den") - F.col("s_num")
-             - 3 * F.col("nv") * (F.col("b") - F.col("s_nw")))
-            .cast("long").alias("norm_resid"),
-        )
-    )
-
-
-# --- greedy non-maximum suppression (q475) -------------------------------------------
-
-
-def _q475_oracle() -> str:
-    box = """SELECT doc_id,
-                j.range AS j,
-                CAST(100 - 5 * j.range + (h8 + j.range) % 3 AS BIGINT)
-                  AS score,
-                (h8 + 37 * j.range) % 16 AS x0,
-                ((h8 // 7) + 29 * j.range) % 16 AS y0,
-                8 + (j.range * j.range) % 9 AS bw,
-                8 + (3 * j.range) % 9 AS bh
-         FROM d CROSS JOIN range(8) j"""
-    inter = ("greatest(0, least(b.x0 + b.bw, p.x0 + p.bw)"
-             " - greatest(b.x0, p.x0))"
-             " * greatest(0, least(b.y0 + b.bh, p.y0 + p.bh)"
-             " - greatest(b.y0, p.y0))")
-    union = f"(b.bw * b.bh + p.bw * p.bh - ({inter}))"
-    parts = [f"""d AS (SELECT doc_id,
-           CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) AS h8
-          FROM documents),
-       bx AS MATERIALIZED ({box}),
-       k1 AS (SELECT doc_id, j, score, x0, y0, bw, bh,
-                     CAST(1 AS BIGINT) AS kept
-              FROM bx WHERE j = 0)"""]
-    prev = "k1"
-    for r in range(1, 8):
-        parts.append(f"""s{r} AS (SELECT b.doc_id, b.j, b.score, b.x0,
-                     b.y0, b.bw, b.bh,
-                     CAST(CASE WHEN EXISTS (
-                          SELECT 1 FROM {prev} p
-                          WHERE p.doc_id = b.doc_id AND p.kept = 1
-                            AND 3 * ({inter}) > {union})
-                     THEN 0 ELSE 1 END AS BIGINT) AS kept
-              FROM bx b WHERE b.j = {r}),
-       k{r + 1} AS MATERIALIZED (SELECT * FROM {prev}
-              UNION ALL SELECT * FROM s{r})""")
-        prev = f"k{r + 1}"
-    return f"""WITH {", ".join(parts)},
-       nk AS (SELECT doc_id, CAST(sum(kept) AS BIGINT) AS n_kept
-              FROM {prev} GROUP BY doc_id)
-       SELECT k.doc_id, CAST(k.j AS BIGINT) AS j, k.score,
-              CAST(k.x0 AS BIGINT) AS x0, CAST(k.y0 AS BIGINT) AS y0,
-              CAST(k.bw AS BIGINT) AS bw, CAST(k.bh AS BIGINT) AS bh,
-              k.kept, nk.n_kept
-       FROM {prev} k JOIN nk ON nk.doc_id = k.doc_id"""
-
-
-@query("q475_nms_detections", _q475_oracle())
-def q475(spark, sf_dir):
-    """Greedy non-maximum suppression — the detector post-processing
-    every vision data pipeline runs between raw boxes and labels
-    (the serving sibling of q351's image dedup: NMS dedups
-    DETECTIONS): process boxes in score order, keep a box iff its
-    IoU with every already-kept box stays <= 1/3, the comparison
-    EXACT by cross-multiplication (3*intersection > union — integer
-    areas, no float IoU anywhere).  Greedy NMS is inherently
-    sequential per image — kept-set membership feeds later
-    decisions — so the engine runs one applyInPandas pass per image
-    (8 fake-decoded boxes per doc, score strictly ordered by
-    construction) and the oracle unrolls the 8 greedy stages as
-    chained MATERIALIZED CTEs with EXISTS-against-kept predicates
-    (the Wang-oracle pattern for sequential recurrences).  Suppressed
-    and kept boxes are both plentiful — the arena must be TIGHT for
-    that: at 40x40 (and even 24x24) the scattered 8-16 px boxes
-    NEVER reach IoU 1/3 and the first cut kept all 8 boxes on every
-    image, the degenerate-knob inspection again; at 16x16 the kept
-    fraction is 0.72 with n_kept spread 5..7.  n_kept rides along
-    per image."""
-    import pandas as pd
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def nms(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-
-        out = {k: [] for k in
-               ("doc_id", "j", "score", "x0", "y0", "bw", "bh",
-                "kept")}
-        for did, text in zip(pdf["doc_id"], pdf["text"]):
-            h8 = int(hashlib.md5(str(text).encode()).hexdigest()[:8], 16)
-            boxes = []
-            for j in range(8):
-                boxes.append((
-                    j, 100 - 5 * j + (h8 + j) % 3,
-                    (h8 + 37 * j) % 16, ((h8 // 7) + 29 * j) % 16,
-                    8 + (j * j) % 9, 8 + (3 * j) % 9,
-                ))
-            kept = []
-            for j, score, x0, y0, bw, bh in boxes:
-                ok = 1
-                for (px0, py0, pbw, pbh) in kept:
-                    iw = max(0, min(x0 + bw, px0 + pbw) - max(x0, px0))
-                    ih = max(0, min(y0 + bh, py0 + pbh) - max(y0, py0))
-                    inter = iw * ih
-                    union = bw * bh + pbw * pbh - inter
-                    if 3 * inter > union:
-                        ok = 0
-                        break
-                if ok:
-                    kept.append((x0, y0, bw, bh))
-                out["doc_id"].append(int(did))
-                out["j"].append(j)
-                out["score"].append(score)
-                out["x0"].append(x0)
-                out["y0"].append(y0)
-                out["bw"].append(bw)
-                out["bh"].append(bh)
-                out["kept"].append(ok)
-        return pd.DataFrame(out)
-
-    # bucket the groupBy: one pandas invocation per ~64th of the
-    # corpus, not per doc — grouping BY doc_id paid 5000 single-row
-    # UDF calls (18.6 s at sf0.1, pure invocation overhead); the
-    # per-doc greedy loop inside is unchanged and doc-independent
-    res = docs.withColumn("g", F.col("doc_id") % 64) \
-        .groupBy("g").applyInPandas(
-            nms,
-            "doc_id long, j long, score long, x0 long, y0 long, "
-            "bw long, bh long, kept long",
-        )
-    nk = res.groupBy("doc_id").agg(
-        F.sum("kept").cast("long").alias("n_kept"))
-    return res.join(nk, "doc_id")
 
 
 # --- succinct rank/select bitvector (q476) -------------------------------------------
@@ -29349,6 +10978,7 @@ def q475(spark, sf_dir):
        JOIN ksmp ON ksmp.s = rk.s
        JOIN seld ON seld.s = rk.s
        JOIN selb ON selb.s = rk.s""",
+    kind="operator",
 )
 def q476(spark, sf_dir):
     """Succinct rank/select bitvector — the o(n)-directory structure
@@ -29467,71 +11097,6 @@ def q476(spark, sf_dir):
     )
 
 
-# --- leave-one-out influence detection (q477) ----------------------------------------
-
-
-def _q477_sql(divop: str) -> str:
-    y = ("(3 + (2 + s) * x + ((x*x*7 + x*3 + s) % 7 - 3)"
-         " + (CASE WHEN x % 10 = 9 THEN 500 ELSE 0 END))")
-    return f"""WITH pts AS (SELECT DISTINCT event_id % 5 AS s,
-                    (event_id {divop} 5) % 20 AS x
-             FROM events),
-       xy AS (SELECT s, x, CAST({y} AS BIGINT) AS y FROM pts),
-       agg AS (SELECT s, CAST(count(*) AS BIGINT) AS n,
-                      CAST(sum(x) AS BIGINT) AS sx,
-                      CAST(sum(y) AS BIGINT) AS sy,
-                      CAST(sum(x*y) AS BIGINT) AS sxy,
-                      CAST(sum(x*x) AS BIGINT) AS sxx
-               FROM xy GROUP BY s),
-       co AS (SELECT s, n, sx, sy,
-                     CAST(n*sxy - sx*sy AS BIGINT) AS b_num,
-                     CAST(n*sxx - sx*sx AS BIGINT) AS b_den
-              FROM agg),
-       lo AS (SELECT xy.s, xy.x, xy.y,
-                     CAST(xy.y * co.n * co.b_den
-                          - (co.sy * co.b_den - co.b_num * co.sx)
-                          - co.n * co.b_num * xy.x AS BIGINT) AS e_num,
-                     CAST((co.n - 1) * co.b_den
-                          - (co.n * xy.x - co.sx)
-                            * (co.n * xy.x - co.sx) AS BIGINT) AS denom_h
-              FROM xy JOIN co ON co.s = xy.s)
-       SELECT s, x, y, e_num, denom_h,
-              CAST(e_num AS DOUBLE) / CAST(denom_h AS DOUBLE) AS loo,
-              CAST(CASE WHEN e_num * e_num
-                        > 22500 * denom_h * denom_h
-                   THEN 1 ELSE 0 END AS BIGINT) AS influential,
-              CAST(CASE WHEN x % 10 = 9 THEN 1 ELSE 0 END AS BIGINT)
-                AS is_planted,
-              CAST(CASE WHEN (e_num * e_num
-                              > 22500 * denom_h * denom_h)
-                        = (x % 10 = 9) THEN 1 ELSE 0 END AS BIGINT)
-                AS agree
-       FROM lo"""
-
-
-@query("q477_loo_influence", _q477_sql("//"))
-def q477(spark, sf_dir):
-    """Leave-one-out influence detection — the hat-matrix diagnostics
-    that DETECT the outliers q462's Theil-Sen survived (the two
-    halves of robust regression: TS delivers a clean slope despite
-    contamination, LOO influence names the contaminated points):
-    for 1-D OLS the deleted residual has the closed form
-    e_i / (1 - h_ii), and with a_den = n*b_den the whole thing
-    collapses to ONE exact division e_num / denom_h where
-    e_num = y*n*b_den - (sy*b_den - b_num*sx) - n*b_num*x and
-    denom_h = (n-1)*b_den - (n*x - sx)^2 — every intermediate an
-    exact BIGINT on both engines.  The influence flag is a pure
-    integer cross-multiplication e_num^2 > 150^2 * denom_h^2 (no
-    float threshold), and agreement with the planted x%10==9
-    contamination is EMITTED per point — agree == 1 on all 100 rows
-    at both SFs, so the detector provably recovers the ground-truth
-    outlier set the estimator absorbed.  One groupBy for the five
-    series' sufficient statistics, then a key join back."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q477_events")
-    return spark.sql(_q477_sql("div").replace("FROM events",
-                                              "FROM q477_events"))
-
-
 # --- streaming token-bucket admission (q478) -----------------------------------------
 
 
@@ -29566,7 +11131,7 @@ def _q478_oracle() -> str:
        FROM tb"""
 
 
-@query("q478_stream_token_bucket", _q478_oracle())
+@query("q478_stream_token_bucket", _q478_oracle(), kind="operator")
 def q478(spark, sf_dir):
     """Streaming token-bucket admission — q470's politeness limiter
     as a REAL Structured Streaming stateful operator
@@ -29588,279 +11153,6 @@ def q478(spark, sf_dir):
     return stream_token_bucket(
         spark, f"{sf_dir}/events.parquet",
         cap=_Q470_CAP, cost=_Q470_COST, n_files=3)
-
-
-# --- Little's law audit (q479) -------------------------------------------------------
-
-
-def _q479_sql(divop: str) -> str:
-    return f"""WITH j AS (SELECT CAST(floor(epoch(ts)) AS BIGINT) AS s,
-                    CAST(1 + event_id % 300 AS BIGINT) AS dur
-             FROM events),
-       bnd AS (SELECT s AS t, CAST(1 AS BIGINT) AS delta FROM j
-               UNION ALL
-               SELECT s + dur AS t, CAST(-1 AS BIGINT) AS delta FROM j),
-       lv AS (SELECT t, CAST(sum(delta) AS BIGINT) AS d
-              FROM bnd GROUP BY t),
-       sw AS (SELECT t, d,
-                     CAST(sum(d) OVER (ORDER BY t
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS level,
-                     lead(t) OVER (ORDER BY t) AS nxt
-              FROM lv),
-       integ AS (SELECT CAST(sum(level * (nxt - t)) AS BIGINT) AS area,
-                        CAST(max(level) AS BIGINT) AS peak
-                 FROM sw WHERE nxt IS NOT NULL),
-       tots AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(dur) AS BIGINT) AS d,
-                       CAST(max(s + dur) - min(s) AS BIGINT) AS span
-                FROM j)
-       SELECT integ.area, tots.d AS sum_durations,
-              CAST(integ.area - tots.d AS BIGINT) AS resid,
-              integ.peak, tots.n, tots.span,
-              CAST(integ.area AS DOUBLE) / CAST(tots.span AS DOUBLE)
-                AS mean_concurrency,
-              CAST(tots.n AS DOUBLE) / CAST(tots.span AS DOUBLE)
-                AS arrival_rate,
-              CAST(tots.d AS DOUBLE) / CAST(tots.n AS DOUBLE)
-                AS mean_latency
-       FROM integ CROSS JOIN tots"""
-
-
-@query("q479_littles_law", _q479_sql("//"))
-def q479(spark, sf_dir):
-    """Little's law audit — L = lambda W measured EXACTLY on the event
-    stream (the queueing identity every capacity dashboard assumes;
-    q374's latency percentiles describe W's distribution, this
-    verifies the conservation law that links it to concurrency):
-    each event becomes a job (start = epoch second, integer duration
-    1 + id % 300), the time-integral of instantaneous concurrency
-    comes from a boundary sweep (+1/-1 deltas, cumulative level,
-    level x interval-length areas — all exact BIGINTs), and the law
-    reduces to the combinatorial identity INTEGRAL == SUM OF
-    DURATIONS, EMITTED as resid == 0 — Little's law for this
-    windowed form is exact accounting, not an asymptotic.  The three
-    rates (L, lambda, W) are one exact division each; peak
-    concurrency rides along.  The sweep's global cumulative window
-    is fixture-bounded; at corpus scale it partitions by time range
-    with per-range boundary offsets (the q236 two-pass
-    partition-count pattern)."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q479_events")
-    return spark.sql(
-        _q479_sql("div")
-        .replace("FROM events", "FROM q479_events")
-        .replace("CAST(floor(epoch(ts)) AS BIGINT)",
-                 "unix_timestamp(ts)")
-    )
-
-
-# --- isotonic calibration via the minimax formula (q480) -----------------------------
-
-
-def _q480_sql(divop: str) -> str:
-    return f"""WITH pr AS (SELECT event_id % 24 AS b,
-                    CASE WHEN (event_id * 13) % 97
-                         < 20 + 3 * (event_id % 24)
-                           - (CASE WHEN (event_id % 24) % 7 = 3
-                              THEN 30 ELSE 0 END)
-                    THEN 1 ELSE 0 END AS y
-             FROM events),
-       bins AS (SELECT b, CAST(count(*) AS BIGINT) AS w,
-                       CAST(sum(y) AS BIGINT) AS s
-                FROM pr GROUP BY b),
-       iv AS (SELECT a.b AS j, c.b AS k,
-                     CAST(sum(m.s) AS BIGINT) AS snum,
-                     CAST(sum(m.w) AS BIGINT) AS sden
-              FROM bins a JOIN bins c ON c.b >= a.b
-              JOIN bins m ON m.b BETWEEN a.b AND c.b
-              GROUP BY a.b, c.b),
-       inner_ AS (SELECT bins.b AS i, iv.j,
-                       min(CAST(iv.snum AS DOUBLE)
-                           / CAST(iv.sden AS DOUBLE)) AS mn
-                FROM bins JOIN iv ON iv.j <= bins.b AND iv.k >= bins.b
-                GROUP BY bins.b, iv.j),
-       fit AS (SELECT i AS b, max(mn) AS fit FROM inner_ GROUP BY i),
-       mono AS (SELECT f.b, f.fit,
-                       CASE WHEN lag(f.fit) OVER (ORDER BY f.b) IS NULL
-                            OR lag(f.fit) OVER (ORDER BY f.b) <= f.fit
-                       THEN 1 ELSE 0 END AS mono_ok
-                FROM fit f)
-       SELECT m.b, bins.w, bins.s,
-              CAST(bins.s AS DOUBLE) / CAST(bins.w AS DOUBLE) AS raw_rate,
-              m.fit, CAST(m.mono_ok AS BIGINT) AS mono_ok,
-              CAST(CASE WHEN CAST(bins.s AS DOUBLE)
-                             / CAST(bins.w AS DOUBLE) <> m.fit
-                   THEN 1 ELSE 0 END AS BIGINT) AS pooled
-       FROM mono m JOIN bins ON bins.b = m.b"""
-
-
-@query("q480_isotonic_calibration", _q480_sql("//"))
-def q480(spark, sf_dir):
-    """Isotonic (PAV) calibration via the MINIMAX closed form — the
-    fix for the miscalibration q381's ECE measures (Zadrozny-Elkan:
-    replace bin rates with the best monotone fit): pool-adjacent-
-    violators is sequential, but the weighted isotonic L2 fit has
-    the order-free characterization fit_i = max_{j<=i} min_{k>=i}
-    mean(y_j..y_k) — every interval mean is an exact rational from
-    two BIGINT sums, and distinct bounded-denominator rationals
-    cannot collide in a double (the q462 argument), so the
-    relational max-of-min over the 300 bin intervals computes the
-    EXACT fit with no sequential pass at all.  The planted
-    non-monotone rate (a 30/97 dip at every 7th bin) forces real
-    pooling: pooled == 1 flags the bins whose raw rate was
-    overwritten, and mono_ok == 1 on every row EMITS the defining
-    monotonicity property.  Interval enumeration is bin-domain
-    bounded (24 bins -> 300 intervals), never event-scale."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q480_events")
-    return spark.sql(_q480_sql("div").replace("FROM events",
-                                              "FROM q480_events"))
-
-
-# --- M/M/1 latency sizing (q481) -----------------------------------------------------
-
-_Q481_CS = [(1, 2), (9, 8), (3, 2), (4, 1)]
-
-
-def _q481_sql(divop: str) -> str:
-    rows = []
-    for cn, cd in _Q481_CS:
-        stable = 1 if cn > cd else 0
-        if stable:
-            w = (f"CAST(t.span * {cd} AS DOUBLE) "
-                 f"/ CAST(t.n * {cn - cd} AS DOUBLE)")
-            l_num, l_den = cd, cn - cd
-        else:
-            w = "CAST(-1 AS DOUBLE)"
-            l_num, l_den = -1, 1
-        rows.append(f"""SELECT CAST({cn} AS BIGINT) AS c_num,
-              CAST({cd} AS BIGINT) AS c_den,
-              CAST({stable} AS BIGINT) AS stable,
-              t.n, t.span,
-              CAST(t.n AS DOUBLE) / CAST(t.span AS DOUBLE)
-                AS lambda_per_s,
-              {w} AS w_seconds,
-              CAST({l_num} AS BIGINT) AS l_num,
-              CAST({l_den} AS BIGINT) AS l_den
-       FROM t""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH t AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                    CAST(max(CAST(floor(epoch(ts)) AS BIGINT))
-                         - min(CAST(floor(epoch(ts)) AS BIGINT))
-                      AS BIGINT) AS span
-             FROM events)
-       {body}"""
-
-
-@query("q481_mm1_sizing", _q481_sql("//"))
-def q481(spark, sf_dir):
-    """M/M/1 latency sizing — the queueing knee behind every
-    capacity decision (q479 verified Little's law holds; this prices
-    the service-rate choice it governs): with the arrival rate
-    MEASURED from the data (lambda = n/span, exact integers) and
-    service rate mu = c * lambda for plan multipliers c in {1/2,
-    9/8, 3/2, 4}, the M/M/1 waits collapse algebraically — W =
-    1/(mu - lambda) = span * c_den / (n * (c_num - c_den)), ONE
-    division of exact BIGINTs, and queue length L = rho/(1 - rho) =
-    c_den/(c_num - c_den), an exact small rational emitted as
-    num/den.  Stability is the pure integer test c_num > c_den;
-    the c = 1/2 row prices the overload case (-1 sentinels).  The
-    grid shows the nonlinear knee a linear-provisioning intuition
-    misses: backing off from 12.5% to 50% headroom cuts W 4x, but
-    the last 2x of capacity only buys 1.5x.  One scan for (n,
-    span); four plan rows."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q481_events")
-    return spark.sql(
-        _q481_sql("div")
-        .replace("FROM events", "FROM q481_events")
-        .replace("CAST(floor(epoch(ts)) AS BIGINT)", "unix_timestamp(ts)")
-    )
-
-
-# --- MVT polygon geometry-command encode (q482) --------------------------------------
-
-
-def _q482_sql() -> str:
-    # CCW base rectangle; odd features planted in CW order so the
-    # orientation-enforcement branch genuinely fires
-    xe = ("CASE WHEN k % 2 = 0 THEN "
-          " (CASE seq WHEN 0 THEN x0 WHEN 1 THEN x0 + w"
-          "  WHEN 2 THEN x0 + w ELSE x0 END) "
-          "ELSE "
-          " (CASE seq WHEN 0 THEN x0 WHEN 1 THEN x0"
-          "  WHEN 2 THEN x0 + w ELSE x0 + w END) END")
-    ye = ("CASE WHEN k % 2 = 0 THEN "
-          " (CASE seq WHEN 0 THEN y0 WHEN 1 THEN y0"
-          "  WHEN 2 THEN y0 + h ELSE y0 + h END) "
-          "ELSE "
-          " (CASE seq WHEN 0 THEN y0 WHEN 1 THEN y0 + h"
-          "  WHEN 2 THEN y0 + h ELSE y0 END) END")
-    return f"""WITH ks AS (SELECT n_nationkey AS k,
-                    (n_nationkey * 7) % 50 AS x0,
-                    (n_nationkey * 11) % 50 AS y0,
-                    3 + n_nationkey % 9 AS w,
-                    2 + n_nationkey % 6 AS h
-             FROM nation),
-       sq AS (SELECT 0 AS seq UNION ALL SELECT 1
-              UNION ALL SELECT 2 UNION ALL SELECT 3),
-       v AS (SELECT k, seq, CAST({xe} AS BIGINT) AS x,
-                    CAST({ye} AS BIGINT) AS y
-             FROM ks CROSS JOIN sq),
-       a2 AS (SELECT a.k,
-                     CAST(sum(a.x * b.y - b.x * a.y) AS BIGINT) AS a2
-              FROM v a JOIN v b ON b.k = a.k
-                AND b.seq = (a.seq + 1) % 4
-              GROUP BY a.k),
-       ord_ AS (SELECT v.k, v.x, v.y, a2.a2,
-                       CASE WHEN a2.a2 < 0 THEN 1 ELSE 0 END AS rev,
-                       CASE WHEN a2.a2 < 0 THEN (4 - v.seq) % 4
-                            ELSE v.seq END AS seq2
-                FROM v JOIN a2 ON a2.k = v.k),
-       d AS (SELECT k, a2, rev, seq2, x, y,
-                    x - lag(x) OVER (PARTITION BY k ORDER BY seq2) AS dx,
-                    y - lag(y) OVER (PARTITION BY k ORDER BY seq2) AS dy
-             FROM ord_),
-       zz AS (SELECT k, max(a2) AS a2, max(rev) AS rev,
-                 CAST(sum(CASE WHEN dx IS NULL THEN
-                       (CASE WHEN x >= 0 THEN 2*x ELSE -2*x - 1 END)
-                     + (CASE WHEN y >= 0 THEN 2*y ELSE -2*y - 1 END)
-                     ELSE
-                       (CASE WHEN dx >= 0 THEN 2*dx ELSE -2*dx - 1 END)
-                     + (CASE WHEN dy >= 0 THEN 2*dy ELSE -2*dy - 1 END)
-                     END) AS BIGINT) AS zz_sum
-              FROM d GROUP BY k)
-       SELECT k, CAST(4 AS BIGINT) AS n_pts,
-              CAST(a2 AS BIGINT) AS a2_raw,
-              CAST(rev AS BIGINT) AS reversed,
-              CAST(CASE WHEN rev = 1 THEN -a2 ELSE a2 END AS BIGINT)
-                AS a2_enc,
-              CAST(CASE WHEN (CASE WHEN rev = 1 THEN -a2 ELSE a2 END) > 0
-                   THEN 1 ELSE 0 END AS BIGINT) AS pos_ok,
-              CAST(9 AS BIGINT) AS cmd_move,
-              CAST(26 AS BIGINT) AS cmd_line,
-              CAST(15 AS BIGINT) AS cmd_close,
-              zz_sum
-       FROM zz"""
-
-
-@query("q482_mvt_polygon_encode", _q482_sql())
-def q482(spark, sf_dir):
-    """MVT POLYGON geometry-command encode — completing the vector-
-    tile writer family (q210 points, q270 linestrings; the OGR MVT
-    writer ogr/ogrsf_frmts/mvt/mvtwriterlayer.cpp, spec §4.3.4.4):
-    a polygon ring is MoveTo(1) + LineTo(n-1) + ClosePath (command
-    integers 9 / 26 / 15), the closing vertex is DROPPED (ClosePath
-    implies it), and the spec's orientation rule — exterior rings
-    must have positive shoelace area — is ENFORCED, not assumed:
-    odd-keyed fixtures are planted clockwise, the writer reverses
-    them keeping the start vertex (seq' = (4 - seq) mod 4), and
-    pos_ok == 1 is emitted per feature on the post-encode area while
-    the reversed flag shows the branch fired on exactly the planted
-    half.  The signed area is the exact integer cyclic-pair sum via
-    one (seq+1) mod 4 self-join; zigzag delta sums replay q270's
-    contract on the reoriented stream.  All integer, both engines
-    bitwise; windows partition by feature."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("q482_nation")
-    return spark.sql(_q482_sql().replace("FROM nation",
-                                         "FROM q482_nation"))
 
 
 # --- ZT curvature landform classification (q483) -------------------------------------
@@ -29889,6 +11181,7 @@ _Q483_CLS = """CASE WHEN r = 0 AND t = 0 THEN 0
               CAST(s AS BIGINT) AS s,
               CAST({_Q483_CLS} AS BIGINT) AS landform
        FROM rts""",
+    kind="operator",
 )
 def q483(spark, sf_dir):
     """Curvature landform classification from the Zevenbergen-Thorne
@@ -29931,6 +11224,7 @@ def q483(spark, sf_dir):
        SELECT CAST(rank0 AS BIGINT) AS rank0, CAST(pos AS BIGINT) AS pos,
               CAST((pos - 1) % 4 AS BIGINT) AS steps, nn.n_occ
        FROM occ CROSS JOIN nn""",
+    kind="operator",
 )
 def q484(spark, sf_dir):
     """FM-index LOCATE — the missing half of q258 (count says HOW
@@ -30033,964 +11327,6 @@ def q484(spark, sf_dir):
     )
 
 
-# --- B-tree height planning (q485) ---------------------------------------------------
-
-_Q485_PAGES = [4096, 16384, 65536]
-
-
-def _q485_sql(divop: str) -> str:
-    rows = []
-    for page in _Q485_PAGES:
-        f = page // 24
-        pows = [f ** k for k in range(1, 7)]
-        h_case = "CASE " + " ".join(
-            f"WHEN t.n <= {pows[k]} THEN {k + 1}" for k in range(6)
-        ) + " ELSE 7 END"
-        fh = "CASE " + " ".join(
-            f"WHEN t.n <= {pows[k]} THEN CAST({pows[k]} AS BIGINT)"
-            for k in range(6)
-        ) + " ELSE CAST(-1 AS BIGINT) END"
-        fh1 = "CASE WHEN t.n <= " + str(pows[0]) + " THEN CAST(1 AS BIGINT) " + " ".join(
-            f"WHEN t.n <= {pows[k]} THEN CAST({pows[k - 1]} AS BIGINT)"
-            for k in range(1, 6)
-        ) + " ELSE CAST(-1 AS BIGINT) END"
-        lvl_sum = " + ".join(
-            f"(CASE WHEN {h_case} > {k} THEN"
-            f" (t.n + {pows[k - 1]} - 1) {divop} {pows[k - 1]}"
-            f" ELSE 0 END)"
-            for k in range(1, 7)
-        )
-        rows.append(f"""SELECT CAST({page} AS BIGINT) AS page_bytes,
-              CAST({f} AS BIGINT) AS fanout,
-              t.n AS n_entries,
-              CAST({h_case} AS BIGINT) AS height,
-              {fh} AS f_pow_h,
-              {fh1} AS f_pow_h1,
-              CAST(CASE WHEN {fh} >= t.n AND {fh1} < t.n
-                   THEN 1 ELSE 0 END AS BIGINT) AS height_ok,
-              CAST({lvl_sum} AS BIGINT) AS nodes_total
-       FROM t""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH t AS (SELECT CAST(sum(n_chars {divop} 4) AS BIGINT)
-                 AS n FROM documents)
-       {body}"""
-
-
-@query("q485_btree_height", _q485_sql("//"))
-def q485(spark, sf_dir):
-    """B-tree height planning — the page-size decision under every
-    postings/key-value store in the storage family (q413 priced LSM
-    amplification; this prices the read path B-trees win): fanout =
-    page/24 (16 B key + 8 B pointer), height = the smallest h with
-    fanout^h >= N over the ACTUAL corpus entry count, computed by a
-    CASE chain whose powers are Python-precomputed BIGINT literals
-    (the q459 folding rule), with the defining bracket
-    f^(h-1) < N <= f^h EMITTED as height_ok on every row.
-    nodes_total sums exact ceilings per level — the buffer-pool
-    budget.  The grid shows why storage engines like big pages:
-    4 KiB needs a 3-level tree where 64 KiB serves the same corpus
-    in 2, one less random read per lookup.  One corpus scan; three
-    plan rows."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q485_docs")
-    return spark.sql(_q485_sql("div").replace("FROM documents",
-                                              "FROM q485_docs"))
-
-
-# --- SAX motif discovery (q486) ------------------------------------------------------
-
-
-def _q486_sql(divop: str) -> str:
-    v = ("CASE WHEN (t {d} 16) % 5 = 2 THEN ((t % 16) * 3) % 7"
-         " ELSE ((t {d} 16) * 13 + (t % 16) * 7 + h) % 11 END"
-         ).replace("{d}", divop)
-    return f"""WITH pts AS (SELECT DISTINCT event_id % 4 AS h,
-                    (event_id {divop} 4) % 256 AS t
-             FROM events),
-       sv AS (SELECT h, t, t {divop} 16 AS win, (t % 16) {divop} 4 AS seg,
-                     CAST({v} AS BIGINT) AS v
-              FROM pts),
-       paa AS (SELECT h, win, seg, CAST(sum(v) AS BIGINT) AS s,
-                      CAST(count(*) AS BIGINT) AS npts
-               FROM sv GROUP BY h, win, seg),
-       sym AS (SELECT h, win, seg,
-                      CASE WHEN s < 8 THEN 0 WHEN s < 16 THEN 1
-                           WHEN s < 24 THEN 2 ELSE 3 END AS sym,
-                      npts
-               FROM paa),
-       word AS (SELECT h, win,
-                       CAST(sum(sym * CAST(power(4, 3 - seg) AS BIGINT))
-                         AS BIGINT) AS word,
-                       CAST(sum(npts) AS BIGINT) AS n_pts
-                FROM sym GROUP BY h, win),
-       mot AS (SELECT h, word, CAST(count(*) AS BIGINT) AS n_windows
-               FROM word GROUP BY h, word)
-       SELECT w.h, CAST(w.win AS BIGINT) AS win, w.word, w.n_pts,
-              m.n_windows,
-              CAST(CASE WHEN m.n_windows >= 3 THEN 1 ELSE 0 END
-                AS BIGINT) AS is_motif,
-              CAST(CASE WHEN (w.win % 5 = 2) THEN 1 ELSE 0 END
-                AS BIGINT) AS planted
-       FROM word w JOIN mot m ON m.h = w.h AND m.word = w.word"""
-
-
-@query("q486_sax_motifs", _q486_sql("//"))
-def q486(spark, sf_dir):
-    """SAX motif discovery — the symbolic time-series primitive
-    (Lin/Keogh: PAA-compress windows to short words, find repeated
-    structure by word EQUALITY — a hash join on words, never an
-    all-pairs distance scan, which is the entire reason SAX scales):
-    16-step windows compress to 4 PAA segment sums (exact integers —
-    this is integer-breakpoint SAX, the quantization grid pinned at
-    {{8, 16, 24}} on the raw sums, so no float ever appears), each
-    window becomes a base-4 word, and motifs are words shared by >=
-    3 windows of the same series.  The fixture plants a repeating
-    shape in every 5th window (win % 5 = 2, the q323 selector rule
-    respected — the motif recurs WITHIN each series): those three
-    windows per series collapse to one word and are flagged, while
-    the varying windows mostly stay unique.  n_pts rides as the
-    coverage column — 16 where the event grid fills the window
-    (sf0.01 up), honestly smaller on sparse SFs whose PAA sums then
-    differ; chance collisions among varying windows surface as
-    additional (unplanted) motifs, which is what a motif MINER
-    reports."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q486_events")
-    return spark.sql(_q486_sql("div").replace("FROM events",
-                                              "FROM q486_events"))
-
-
-# --- trimmed + winsorized robust statistics (q487) -----------------------------------
-
-
-def _q487_sql(divop: str) -> str:
-    y = ("(3 + (2 + s) * x + ((x*x*7 + x*3 + s) % 7 - 3)"
-         " + (CASE WHEN x % 10 = 9 THEN 500 ELSE 0 END))")
-    return f"""WITH pts AS (SELECT DISTINCT event_id % 5 AS s,
-                    (event_id {divop} 5) % 20 AS x
-             FROM events),
-       xy AS (SELECT s, x, CAST({y} AS BIGINT) AS y FROM pts),
-       rk AS (SELECT s, x, y,
-                     row_number() OVER (PARTITION BY s
-                                        ORDER BY y, x) AS rnk
-              FROM xy),
-       lohi AS (SELECT a.s, a.y AS v_lo, b.y AS v_hi
-                FROM rk a JOIN rk b ON b.s = a.s
-                WHERE a.rnk = 3 AND b.rnk = 18),
-       agg AS (SELECT rk.s,
-                      CAST(sum(rk.y) AS BIGINT) AS raw_sum,
-                      CAST(count(*) AS BIGINT) AS n,
-                      CAST(sum(CASE WHEN rk.rnk BETWEEN 3 AND 18
-                           THEN rk.y ELSE 0 END) AS BIGINT) AS trim_sum,
-                      CAST(sum(CASE WHEN rk.rnk < 3 THEN l.v_lo
-                               WHEN rk.rnk > 18 THEN l.v_hi
-                               ELSE rk.y END) AS BIGINT) AS wins_sum
-               FROM rk JOIN lohi l ON l.s = rk.s
-               GROUP BY rk.s)
-       SELECT s, raw_sum, trim_sum, wins_sum, n,
-              CAST(raw_sum AS DOUBLE) / CAST(n AS DOUBLE) AS raw_mean,
-              CAST(trim_sum AS DOUBLE) / 16.0 AS trimmed_mean,
-              CAST(wins_sum AS DOUBLE) / CAST(n AS DOUBLE) AS wins_mean,
-              CAST(raw_sum AS DOUBLE) / CAST(n AS DOUBLE)
-                - CAST(trim_sum AS DOUBLE) / 16.0 AS outlier_pull
-       FROM agg"""
-
-
-@query("q487_trimmed_stats", _q487_sql("//"))
-def q487(spark, sf_dir):
-    """Trimmed and winsorized means — the order-statistic robust
-    location estimators rounding out the robustness family (q462
-    Theil-Sen slope, q477 LOO influence; this is the LOCATION
-    version a metrics dashboard actually displays): on the shared
-    contaminated series, the 10% trimmed mean drops ranks outside
-    3..18 (pinned inclusive contract, value-at-rank semantics) and
-    the winsorized mean CLAMPS them to the rank-3/rank-18 values —
-    all three sums exact BIGINTs, one division each.  outlier_pull =
-    raw - trimmed makes the contamination VISIBLE (~+50 per series,
-    two +500 outliers over 20 points) while trimmed and winsorized
-    stay at the clean level — the comparison that justifies
-    trimming.  One rank window per bounded series + one groupBy."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q487_events")
-    return spark.sql(_q487_sql("div").replace("FROM events",
-                                              "FROM q487_events"))
-
-
-# --- second-price auction + reserve optimization (q488) ------------------------------
-
-
-def _q488_sql(divop: str) -> str:
-    bid = "((a * 7 + b * 13 + b * b * 3) % 60) + 1"
-    rows = []
-    for r in (15, 25, 35, 45):
-        rows.append(f"""SELECT CAST({r} AS BIGINT) AS reserve,
-              CAST(sum(CASE WHEN top >= {r} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_sold,
-              CAST(sum(CASE WHEN top >= {r}
-                   THEN (CASE WHEN second > {r} THEN second
-                         ELSE {r} END) ELSE 0 END) AS BIGINT) AS revenue,
-              CAST(count(*) AS BIGINT) AS n_auctions
-       FROM tb""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH bids AS (SELECT DISTINCT event_id {divop} 4 AS a,
-                    event_id % 4 AS b
-             FROM events),
-       bv AS (SELECT a, b, CAST({bid} AS BIGINT) AS bid FROM bids),
-       rk AS (SELECT a, bid,
-                     row_number() OVER (PARTITION BY a
-                                        ORDER BY bid DESC, b ASC) AS rnk
-              FROM bv),
-       tb AS (SELECT t1.a, t1.bid AS top, t2.bid AS second
-              FROM rk t1 JOIN rk t2 ON t2.a = t1.a
-              WHERE t1.rnk = 1 AND t2.rnk = 2),
-       g AS ({body})
-       SELECT g.*,
-              CAST(CASE WHEN row_number() OVER (ORDER BY g.revenue DESC,
-                        g.reserve ASC) = 1 THEN 1 ELSE 0 END AS BIGINT)
-                AS is_optimal
-       FROM g"""
-
-
-@query("q488_second_price_auction", _q488_sql("//"))
-def q488(spark, sf_dir):
-    """Second-price auction clearing + reserve optimization — the ad
-    economics under every monetized web corpus (the revenue
-    counterpart to q373's position bias and q471's policy replay):
-    per 4-bidder auction the winner pays max(second bid, reserve)
-    when the top bid clears the reserve — winner and runner-up are
-    value-at-rank order statistics (ties to the lowest bidder id,
-    pinned), every price an exact integer, and the four-reserve
-    revenue grid is one conditional aggregation over the (top,
-    second) pairs — the auction table never re-scans per reserve.
-    is_optimal marks the revenue-maximizing reserve (the Myerson
-    tradeoff made visible: raising the floor lifts per-sale price
-    but kills low-value auctions — revenue peaks strictly inside the grid at 35, with the 45 floor
-    visibly killing sales — the first cut's 8-bidder/50-range fixture
-    had seconds so high that three reserves never bound at all,
-    another degenerate knob caught by inspection).  One rank window per bounded auction + one grid
-    aggregation."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q488_events")
-    return spark.sql(_q488_sql("div").replace("FROM events",
-                                              "FROM q488_events"))
-
-
-# --- multi-window SLO burn-rate alerting (q489) --------------------------------------
-
-
-def _q489_sql(divop: str) -> str:
-    err = ("CASE WHEN event_id % 1000 BETWEEN 300 AND 499"
-           " THEN (CASE WHEN (event_id * 7) % 10 < 3 THEN 1 ELSE 0 END)"
-           " ELSE (CASE WHEN (event_id * 7) % 50 < 1 THEN 1 ELSE 0 END)"
-           " END")
-    return f"""WITH e AS (SELECT event_id, event_id {divop} 64 AS w64,
-                    event_id {divop} 512 AS w512,
-                    CAST({err} AS BIGINT) AS err
-             FROM events),
-       s AS (SELECT w64, min(w512) AS w512,
-                    CAST(sum(err) AS BIGINT) AS errs,
-                    CAST(count(*) AS BIGINT) AS n
-             FROM e GROUP BY w64),
-       l AS (SELECT w512, CAST(sum(err) AS BIGINT) AS errl,
-                    CAST(count(*) AS BIGINT) AS nl
-             FROM e GROUP BY w512),
-       j AS (SELECT s.w64, s.errs, s.n, l.errl, l.nl,
-                    CASE WHEN 10 * s.errs > s.n
-                         AND 20 * l.errl > l.nl
-                    THEN 1 ELSE 0 END AS alert
-             FROM s JOIN l ON l.w512 = s.w512)
-       SELECT CAST(w64 AS BIGINT) AS w64, errs, n,
-              CAST(errl AS BIGINT) AS errl, nl,
-              CAST(errs AS DOUBLE) / CAST(n AS DOUBLE) AS short_rate,
-              CAST(errl AS DOUBLE) / CAST(nl AS DOUBLE) AS long_rate,
-              CAST(alert AS BIGINT) AS alert,
-              CAST(CASE WHEN (w64 * 64) % 1000 < 500
-                        AND (w64 * 64 + 63) % 1000 >= 300
-                        AND ((w64 * 64) % 1000) >= 236
-                   THEN 1 ELSE 0 END AS BIGINT) AS overlaps_incident
-       FROM j"""
-
-
-@query("q489_slo_burn_alerts", _q489_sql("//"))
-def q489(spark, sf_dir):
-    """Multi-window SLO burn-rate alerting — the Google-SRE alerting
-    rule every serving fleet runs on its error budget (the
-    operational consumer of q374's percentiles and q481's sizing):
-    a SHORT window catches the spike fast, the enclosing LONG window
-    confirms it is sustained, and the alert fires only on BOTH —
-    10 * short_errors > short_n AND 20 * long_errors > long_n, pure
-    integer cross-multiplications of exact window counts (rates
-    emitted as one division each, for reading).  The fixture plants
-    a 30%-error incident on every event_id % 1000 in [300, 500)
-    (present at EVERY scale factor — an absolute-id incident range
-    would vanish from small fixtures) against a 2% baseline, and
-    overlaps_incident carries the ground-truth window overlap so
-    alert precision is inspectable in the result.  Two sequence-
-    window groupBys + one window-key join — no global sort, the
-    shape that survives a real event stream."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q489_events")
-    return spark.sql(_q489_sql("div").replace("FROM events",
-                                              "FROM q489_events"))
-
-
-# --- dominant-resource-fairness allocation (q490) ------------------------------------
-
-_Q490_USERS = [(0, 1, 4), (1, 3, 1), (2, 2, 2)]  # (user, cpu, mem) per task
-
-
-def _q490_sql(divop: str) -> str:
-    from fractions import Fraction
-
-    # capacities: CPU = n, MEM = 2n (n = event count).  Per-task
-    # dominant share w_u = max(dc/n, dm/2n) = m_u/n with
-    # m_u = max(2 dc, dm)/2; the equalized share s and the per-user
-    # task counts x_u = s n / m_u are exact Fractions whose ratios
-    # are data-independent (n cancels) — Python computes them once.
-    ms = {u: Fraction(max(2 * dc, dm), 2) for u, dc, dm in _Q490_USERS}
-    s_cpu = Fraction(1) / sum(Fraction(dc, 1) / ms[u]
-                              for u, dc, dm in _Q490_USERS)
-    s_mem = Fraction(2) / sum(Fraction(dm, 1) / ms[u]
-                              for u, dc, dm in _Q490_USERS)
-    s = min(s_cpu, s_mem)
-    bind = "cpu" if s_cpu <= s_mem else "mem"
-    use_c = sum(s / ms[u] * dc for u, dc, dm in _Q490_USERS)  # of n
-    use_m = sum(s / ms[u] * dm for u, dc, dm in _Q490_USERS)  # of n
-    rows = []
-    for u, dc, dm in _Q490_USERS:
-        x = s / ms[u]  # tasks per unit n
-        rows.append(f"""SELECT CAST({u} AS BIGINT) AS usr,
-              CAST({dc} AS BIGINT) AS d_cpu, CAST({dm} AS BIGINT) AS d_mem,
-              CAST({s.numerator} AS BIGINT) AS share_num,
-              CAST({s.denominator} AS BIGINT) AS share_den,
-              CAST(n.n * {x.numerator} AS BIGINT) AS tasks_num,
-              CAST({x.denominator} AS BIGINT) AS tasks_den,
-              CAST(n.n * {x.numerator} AS DOUBLE)
-                / CAST({x.denominator} AS DOUBLE) AS tasks,
-              '{bind}' AS binding_resource,
-              CAST(n.n * {use_c.numerator} AS BIGINT) AS cpu_use_num,
-              CAST({use_c.denominator} AS BIGINT) AS cpu_use_den,
-              CAST(CASE WHEN n.n * {use_c.numerator}
-                        = n.n * {use_c.denominator}
-                   THEN 1 ELSE 0 END AS BIGINT) AS cpu_saturated,
-              CAST(CASE WHEN n.n * {use_m.numerator}
-                        <= 2 * n.n * {use_m.denominator}
-                   THEN 1 ELSE 0 END AS BIGINT) AS mem_within_cap
-       FROM n""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n
-                 FROM events)
-       {body}"""
-
-
-@query("q490_drf_allocation", _q490_sql("//"))
-def q490(spark, sf_dir):
-    """Dominant-resource-fairness allocation — the multi-resource
-    scheduler arithmetic (Ghodsi 2011) a shared Spark/YARN cluster
-    runs to split CPU and memory among tenants (the fairness
-    counterpart to q208's single-resource water-filling): each
-    user's dominant share is max over resources of its usage
-    fraction, DRF equalizes those shares, and in the fluid model the
-    whole allocation is EXACT-RATIONAL — per-task dominant weight
-    m_u = max(2 d_cpu, d_mem)/2 under the CPU = n, MEM = 2n
-    capacities (n = the ACTUAL event count), equalized share
-    s = min_r cap_r / sum(d_ur/m_u) with the data scale CANCELLING
-    (Python Fractions compute the ratios once, inlined as num/den
-    BIGINTs), task counts x_u = s n / m_u one division each.  The
-    defining properties are EMITTED per row: the binding resource is
-    named, cpu_saturated == 1 proves the bound resource is consumed
-    EXACTLY to capacity in integers, and mem_within_cap == 1 proves
-    feasibility of the other.  The (1,4)/(3,1)/(2,2) demand triple
-    is the classical DRF example shape."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q490_events")
-    return spark.sql(_q490_sql("div").replace("FROM events",
-                                              "FROM q490_events"))
-
-
-# --- adaptive-bitrate ladder planning (q491) -----------------------------------------
-
-_Q491_LADDERS = {
-    "coarse": [400, 1200, 2800, 5200],
-    "fine": [400, 700, 1200, 1800, 2800, 3600, 4400, 5200],
-}
-
-
-def _q491_sql(divop: str) -> str:
-    rows = []
-    for lname, rungs in _Q491_LADDERS.items():
-        rung_case = "CASE " + " ".join(
-            f"WHEN bw >= {b} THEN {b}"
-            for b in sorted(rungs, reverse=True)
-        ) + " ELSE 0 END"
-        rows.append(f"""SELECT '{lname}' AS ladder,
-              CAST({rung_case} AS BIGINT) AS rung,
-              CAST(count(*) AS BIGINT) AS n,
-              CAST(sum(CASE WHEN {rung_case} = 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS rebuffers,
-              CAST(sum(bw - {rung_case}) AS BIGINT) AS headroom_sum
-       FROM bwt GROUP BY {rung_case}""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH bwt AS (SELECT (event_id * 31) % 6000 + 200 AS bw
-             FROM events),
-       g AS ({body}),
-       tot AS (SELECT ladder,
-                      CAST(sum(headroom_sum) AS BIGINT)
-                        AS ladder_headroom,
-                      CAST(sum(n) AS BIGINT) AS ladder_events,
-                      CAST(sum(rebuffers) AS BIGINT) AS ladder_rebuffers
-               FROM g GROUP BY ladder)
-       SELECT g.ladder, g.rung, g.n, g.rebuffers, g.headroom_sum,
-              t.ladder_headroom, t.ladder_events, t.ladder_rebuffers,
-              CAST(t.ladder_headroom AS DOUBLE)
-                / CAST(t.ladder_events AS DOUBLE) AS mean_headroom
-       FROM g JOIN tot t ON t.ladder = g.ladder"""
-
-
-@query("q491_abr_ladder", _q491_sql("//"))
-def q491(spark, sf_dir):
-    """Adaptive-bitrate ladder planning — the rung-selection audit a
-    video delivery pipeline runs before committing an encoding
-    ladder (the serving economics of the multimodal family: every
-    rung is a whole extra encode + storage tier, q394's encoding
-    selection priced ONE asset, this prices the LADDER): per
-    momentary bandwidth sample the player takes the highest rung
-    <= bw (a pinned greedy CASE descent — integer comparisons only),
-    bw below the floor counts as a rebuffer, and wasted headroom
-    bw - rung is summed exactly.  Comparing the 4-rung and 8-rung
-    ladders on identical samples shows the designer's tradeoff in
-    one table: the fine ladder roughly halves mean headroom (~800
-    -> ~400 kbps of paid-for-but-unused bandwidth) at double the
-    encode cost, with identical rebuffer floors.  One scan, two
-    grouped aggregations; rung domains are ladder-bounded."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q491_events")
-    return spark.sql(_q491_sql("div").replace("FROM events",
-                                              "FROM q491_events"))
-
-
-# --- galloping vs merge intersection cost audit (q492) --------------------------------
-
-_Q492_PAIRS = [(3, 2), (24, 2), (96, 2)]  # (rare modulus, common modulus)
-
-
-def _q492_sql(divop: str) -> str:
-    # term t_m "appears" in doc d iff d % m == 0: df(t_m) = N div m,
-    # and postings are the sorted multiples of m — deterministic
-    # posting lists whose intersection ranks are computable exactly.
-    rows = []
-    for ma, mb in _Q492_PAIRS:
-        rows.append(f"""SELECT '{ma}x{mb}' AS pair,
-              la.la, lb.lb,
-              CAST(la.la + lb.lb AS BIGINT) AS merge_cost,
-              g.gallop_cost,
-              CAST(CASE WHEN g.gallop_cost < la.la + lb.lb
-                   THEN 1 ELSE 0 END AS BIGINT) AS gallop_wins
-       FROM (SELECT CAST(count(*) AS BIGINT) AS la FROM docs
-             WHERE doc_id % {ma} = 0) la
-       CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS lb FROM docs
-             WHERE doc_id % {mb} = 0) lb
-       CROSS JOIN (
-         SELECT CAST(coalesce(sum(
-                2 * length(bin(rnk - prev_rnk + 1))), 0) AS BIGINT)
-           AS gallop_cost
-         FROM (
-           SELECT r.rnk,
-                  coalesce(lag(r.rnk) OVER (ORDER BY r.x), 0) AS prev_rnk
-           FROM (
-             SELECT a.doc_id AS x,
-                    CAST(count(b.doc_id) AS BIGINT) AS rnk
-             FROM docs a LEFT JOIN docs b
-               ON b.doc_id % {mb} = 0 AND b.doc_id <= a.doc_id
-             WHERE a.doc_id % {ma} = 0
-             GROUP BY a.doc_id) r) gsub) g""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH docs AS (SELECT DISTINCT doc_id FROM documents)
-       {body}"""
-
-
-@query("q492_gallop_vs_merge", _q492_sql("//"))
-def q492(spark, sf_dir):
-    """Galloping vs linear-merge intersection cost — the posting-list
-    strategy decision inside every conjunctive query (q287 PLANNED
-    by df estimates; this COUNTS the actual probe work on the actual
-    lists): for each element of the rare list, galloping pays
-    2 * ceil(log2(gap + 1)) comparisons to advance by `gap` ranks in
-    the common list (exponential probe + binary search, the pinned
-    textbook cost model computed via the bin()-length floor-log2
-    idiom — no transcendental), while merge pays la + lb regardless.
-    Posting lists are deterministic divisibility classes of the doc
-    table, so every rank is an exact count and every gap an exact
-    integer.  The three df-ratio pairs show the crossover the
-    planner needs: near-equal lists favor merge (gaps of 0-1 make
-    every gallop a wasted double-probe — the first cut even had the
-    rare/common roles INVERTED, making gallop exactly 2x merge on
-    every row, caught by the all-same winner column), a 12x ratio
-    flips decisively to galloping.  The rank probe is a bounded correlated count over
-    the rare list only — cost proportional to the SHORT side, which
-    is the whole point."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q492_docs")
-    return spark.sql(_q492_sql("div").replace("FROM documents",
-                                              "FROM q492_docs"))
-
-
-# --- PERT critical path (q493) -------------------------------------------------------
-
-_Q493_DEPS = [
-    # layered DAG: (task, layer, duration-formula uses task id)
-    # edges (pred -> succ) planted below
-    (0, 1), (0, 2), (1, 3), (2, 3), (1, 4), (3, 5), (4, 5),
-    (2, 6), (6, 5),
-]
-
-
-def _q493_sql(divop: str) -> str:
-    edges = ", ".join(f"({a}, {b})" for a, b in _Q493_DEPS)
-    return f"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n
-                 FROM documents),
-       t AS (SELECT tid, CAST(5 + (tid * 7 + n.n % 13) % 20 AS BIGINT)
-                AS dur
-             FROM (VALUES (0), (1), (2), (3), (4), (5), (6)) tt(tid)
-             CROSS JOIN n),
-       e AS (SELECT * FROM (VALUES {edges}) AS ee(a, b)),
-       es0 AS (SELECT tid, CAST(0 AS BIGINT) AS es FROM t),
-       es1 AS (SELECT t.tid,
-                      CAST(coalesce(max(p.es + tp.dur), 0) AS BIGINT)
-                        AS es
-               FROM t LEFT JOIN e ON e.b = t.tid
-               LEFT JOIN es0 p ON p.tid = e.a
-               LEFT JOIN t tp ON tp.tid = e.a
-               GROUP BY t.tid),
-       es2 AS (SELECT t.tid,
-                      CAST(coalesce(max(p.es + tp.dur), 0) AS BIGINT)
-                        AS es
-               FROM t LEFT JOIN e ON e.b = t.tid
-               LEFT JOIN es1 p ON p.tid = e.a
-               LEFT JOIN t tp ON tp.tid = e.a
-               GROUP BY t.tid),
-       es3 AS (SELECT t.tid,
-                      CAST(coalesce(max(p.es + tp.dur), 0) AS BIGINT)
-                        AS es
-               FROM t LEFT JOIN e ON e.b = t.tid
-               LEFT JOIN es2 p ON p.tid = e.a
-               LEFT JOIN t tp ON tp.tid = e.a
-               GROUP BY t.tid),
-       fin AS (SELECT CAST(max(es3.es + t.dur) AS BIGINT) AS makespan
-               FROM es3 JOIN t ON t.tid = es3.tid),
-       lf0 AS (SELECT t.tid, fin.makespan AS lf FROM t CROSS JOIN fin),
-       lf1 AS (SELECT t.tid,
-                      CAST(coalesce(min(s.lf - ts.dur), fin.makespan)
-                        AS BIGINT) AS lf
-               FROM t CROSS JOIN fin
-               LEFT JOIN e ON e.a = t.tid
-               LEFT JOIN lf0 s ON s.tid = e.b
-               LEFT JOIN t ts ON ts.tid = e.b
-               GROUP BY t.tid, fin.makespan),
-       lf2 AS (SELECT t.tid,
-                      CAST(coalesce(min(s.lf - ts.dur), fin.makespan)
-                        AS BIGINT) AS lf
-               FROM t CROSS JOIN fin
-               LEFT JOIN e ON e.a = t.tid
-               LEFT JOIN lf1 s ON s.tid = e.b
-               LEFT JOIN t ts ON ts.tid = e.b
-               GROUP BY t.tid, fin.makespan),
-       lf3 AS (SELECT t.tid,
-                      CAST(coalesce(min(s.lf - ts.dur), fin.makespan)
-                        AS BIGINT) AS lf
-               FROM t CROSS JOIN fin
-               LEFT JOIN e ON e.a = t.tid
-               LEFT JOIN lf2 s ON s.tid = e.b
-               LEFT JOIN t ts ON ts.tid = e.b
-               GROUP BY t.tid, fin.makespan)
-       SELECT t.tid, t.dur, es3.es,
-              CAST(lf3.lf AS BIGINT) AS lf,
-              CAST(lf3.lf - t.dur - es3.es AS BIGINT) AS slack,
-              fin.makespan,
-              CAST(CASE WHEN lf3.lf - t.dur - es3.es = 0
-                   THEN 1 ELSE 0 END AS BIGINT) AS on_critical_path,
-              CAST(CASE WHEN es3.es + t.dur <= lf3.lf
-                   THEN 1 ELSE 0 END AS BIGINT) AS feasible
-       FROM t JOIN es3 ON es3.tid = t.tid
-       JOIN lf3 ON lf3.tid = t.tid CROSS JOIN fin"""
-
-
-@query("q493_critical_path", _q493_sql("//"))
-def q493(spark, sf_dir):
-    """PERT critical path — the DAG-scheduling arithmetic behind every
-    pipeline orchestrator (q444 priced one pipeline shape; this
-    schedules an arbitrary bounded-depth DAG): earliest starts by 3
-    unrolled forward relaxations (the DAG depth), latest finishes by
-    3 backward ones from the makespan, slack = lf - dur - es, and
-    the critical path is the slack-zero set — every quantity an
-    exact integer, durations tied to the corpus via a count-seeded
-    formula so the schedule varies with the data.  Emitted proofs:
-    feasible == 1 (es + dur <= lf on every task — the relaxations
-    genuinely converged at the unroll depth) and the slack-zero set
-    forms the longest chain whose length equals the makespan.  The
-    oracle replays the identical unrolled stages; bounded 7-task /
-    9-edge fixture, relaxation rounds = planted depth."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q493_docs")
-    return spark.sql(_q493_sql("div").replace("FROM documents",
-                                              "FROM q493_docs"))
-
-
-# --- UTM zone + latitude-band selection (q494) ---------------------------------------
-
-
-def _q494_sql(divop: str) -> str:
-    # lon in [-180, 180), lat in [-80, 84) derived from doc keys;
-    # every 10th doc pair is PLANTED inside the Norway / Svalbard
-    # exception windows so both special cases fire at every SF
-    lon = ("(CASE WHEN doc_id % 10 = 3"
-           " THEN 3 + (doc_id {d} 10) % 9"
-           " WHEN doc_id % 10 = 7"
-           " THEN (doc_id {d} 10) % 42"
-           " ELSE CAST((doc_id * 37) % 360 AS BIGINT) - 180 END)")
-    lat = ("(CASE WHEN doc_id % 10 = 3"
-           " THEN 56 + (doc_id {d} 10) % 8"
-           " WHEN doc_id % 10 = 7"
-           " THEN 72 + (doc_id {d} 10) % 12"
-           " ELSE CAST((doc_id * 53) % 164 AS BIGINT) - 80 END)")
-    lon = lon.replace("{d}", divop)
-    lat = lat.replace("{d}", divop)
-    base = f"CAST(({lon} + 180) {divop} 6 + 1 AS BIGINT)"
-    band = (f"CASE WHEN {lat} >= 72 THEN 'X' ELSE "
-            f"substr('CDEFGHJKLMNPQRSTUVWX', "
-            f"CAST(({lat} + 80) {divop} 8 + 1 AS INT), 1) END")
-    zone = f"""CASE
-         WHEN {lat} >= 56 AND {lat} < 64 AND {lon} >= 3 AND {lon} < 12
-           THEN 32
-         WHEN {lat} >= 72 AND {lon} >= 0 AND {lon} < 9 THEN 31
-         WHEN {lat} >= 72 AND {lon} >= 9 AND {lon} < 21 THEN 33
-         WHEN {lat} >= 72 AND {lon} >= 21 AND {lon} < 33 THEN 35
-         WHEN {lat} >= 72 AND {lon} >= 33 AND {lon} < 42 THEN 37
-         ELSE {base} END"""
-    return f"""WITH z AS (SELECT doc_id, {lon} AS lon, {lat} AS lat,
-                    CAST({zone} AS BIGINT) AS zone,
-                    CAST({base} AS BIGINT) AS base_zone,
-                    {band} AS band
-             FROM documents)
-       SELECT z.doc_id, z.lon, z.lat, z.zone, z.band,
-              CAST(CASE WHEN z.zone <> z.base_zone THEN 1 ELSE 0 END
-                AS BIGINT) AS exception_applied,
-              CAST(CASE WHEN z.zone BETWEEN 1 AND 60 THEN 1 ELSE 0 END
-                AS BIGINT) AS zone_valid
-       FROM z"""
-
-
-@query("q494_utm_zone_select", _q494_sql("//"))
-def q494(spark, sf_dir):
-    """UTM zone + latitude-band selection — the CRS-routing decision
-    upstream of every q121 Krüger projection call (the reference's
-    ogr_proj logic: zone = (lon+180)/6 + 1, MGRS bands C..X in
-    8-degree steps with I/O skipped and band X stretched to 12
-    degrees, plus the two REAL map exceptions every implementation
-    must carry — southwest Norway folds zones 31V/32V into 32, and
-    Svalbard above 72N uses only the odd zones 31/33/35/37):
-    all-integer classification (the band letter by exact substring
-    index into the C..X alphabet), with exception_applied flagging
-    exactly the points the special cases moved and zone_valid == 1
-    riding as the domain proof.  The key-derived lon/lat grid
-    covers all four exception windows at every SF.  Pure Column
-    arithmetic, one scan."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q494_docs")
-    return spark.sql(_q494_sql("div").replace("FROM documents",
-                                              "FROM q494_docs"))
-
-
-# --- feature-hashing occupancy accounting (q495) --------------------------------------
-
-
-def _q495_sql(engine: str) -> str:
-    h = ("CAST(('0x' || substr(md5(word), 1, 8)) AS BIGINT)"
-         if engine == "duck"
-         else "CAST(conv(substr(md5(word), 1, 8), 16, 10) AS BIGINT)")
-    if engine == "duck":
-        words = ("SELECT DISTINCT unnest([substr(lower(text), i, 3)"
-                 " for i in range(1, length(text) - 1)]) AS word"
-                 " FROM documents WHERE length(text) >= 3")
-    else:
-        words = ("SELECT DISTINCT explode(transform("
-                 "sequence(1, length(text) - 2),"
-                 " i -> substring(lower(text), i, 3))) AS word"
-                 " FROM documents WHERE length(text) >= 3")
-    rows = []
-    for k in (6, 10, 14):
-        b = 1 << k
-        rows.append(f"""SELECT CAST({k} AS BIGINT) AS k_bits,
-              CAST({b} AS BIGINT) AS n_buckets,
-              v.v AS n_features,
-              CAST(count(*) AS BIGINT) AS occupied,
-              CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT)
-                AS collided_features,
-              CAST(max(c) AS BIGINT) AS max_load,
-              CAST(v.v - count(*) AS BIGINT) AS excess
-       FROM (SELECT {h} % {b} AS bkt, CAST(count(*) AS BIGINT) AS c
-             FROM w GROUP BY {h} % {b}) t
-       CROSS JOIN v GROUP BY v.v""")
-    body = " UNION ALL ".join(rows)
-    return f"""WITH w AS ({words}),
-       v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM w)
-       {body}"""
-
-
-@query("q495_feature_hashing", _q495_sql("duck"))
-def q495(spark, sf_dir):
-    """Feature-hashing (hashing-trick) occupancy accounting — the
-    collision audit behind every fixed-width linear model over an
-    unbounded vocabulary (Weinberger 2009; the q339 vocab/OOV
-    tradeoff for models that refuse to keep a vocabulary at all):
-    hash the distinct corpus char-trigram feature space into 2^k
-    buckets for k = 6 / 10 / 14 and measure EXACTLY what the
-    birthday bound only approximates — occupied buckets, features sharing a bucket
-    (collided weight mass), the worst pile-up, and excess =
-    features - occupied (the number of weights irretrievably
-    merged).  All counts from one md5-keyed groupBy per width; the
-    grid shows why headroom is the working rule: at k=6 essentially
-    every feature shares a bucket, at k=14 collisions fall to the
-    percent level.  Vocabulary-bounded aggregation, never corpus-row-scale."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q495_docs")
-    return spark.sql(_q495_sql("spark").replace("FROM documents",
-                                                "FROM q495_docs"))
-
-
-# --- theta-sketch set-operation audit (q496) -----------------------------------------
-
-
-def _q496_sql(engine: str) -> str:
-    h = ("CAST(('0x' || substr(md5('i' || CAST(i AS VARCHAR)), 1, 8))"
-         " AS BIGINT)"
-         if engine == "duck"
-         else "CAST(conv(substr(md5(concat('i', CAST(i AS STRING))),"
-              " 1, 8), 16, 10) AS BIGINT)")
-    t = 1 << 26  # theta: keep h32 < 2^26 (1/64 sampling)
-    return f"""WITH a AS (SELECT DISTINCT doc_id * 2 AS i FROM documents
-             UNION SELECT DISTINCT doc_id * 2 + 1 FROM documents),
-       b AS (SELECT DISTINCT doc_id * 2 + 500 AS i FROM documents
-             UNION SELECT DISTINCT doc_id * 2 + 501 FROM documents),
-       sa AS (SELECT i FROM a WHERE {h} % 4294967296 < {t}),
-       sb AS (SELECT i FROM b WHERE {h} % 4294967296 < {t}),
-       m AS (
-         SELECT 'A' AS set_name,
-                CAST((SELECT count(*) FROM sa) * 64 AS BIGINT) AS est,
-                CAST((SELECT count(*) FROM a) AS BIGINT) AS true_count
-         UNION ALL
-         SELECT 'B',
-                CAST((SELECT count(*) FROM sb) * 64 AS BIGINT),
-                CAST((SELECT count(*) FROM b) AS BIGINT)
-         UNION ALL
-         SELECT 'A_and_B',
-                CAST((SELECT count(*) FROM sa JOIN sb ON sb.i = sa.i)
-                     * 64 AS BIGINT),
-                CAST((SELECT count(*) FROM a JOIN b ON b.i = a.i)
-                  AS BIGINT))
-       SELECT set_name, est, true_count,
-              CAST(est - true_count AS BIGINT) AS err
-       FROM m"""
-
-
-@query("q496_theta_sketch", _q496_sql("duck"))
-def q496(spark, sf_dir):
-    """Theta-sketch set operations — the sketch family member HLL
-    cannot provide (q279/q311/q422 estimate and merge UNIONS; theta
-    sketches also INTERSECT, because a uniform hash sample of a set
-    intersected with a sample of another IS a sample of the
-    intersection — the KMV/theta insight): items are two key-derived
-    id ranges overlapping by HALF (|A| = |B| = 2N, |A and B| = N — a
-    real Venn; the first cut used corpus 4-grams, whose vocabulary
-    is shared across every doc subset so A, B, and A-and-B were the
-    SAME set within 2 items — the degenerate-knob inspection yet
-    again), the sketch keeps hashes below theta = 2^26 of the
-    32-bit range (exact 1/64 rate, so the estimator is
-    the INTEGER count * 64 — no float until the reader), and the
-    audit carries the exact TRUE cardinalities computed from the
-    full sets alongside (est - true emitted per row).  The
-    intersection row is the point: its estimate comes from joining
-    the two TINY sample tables (64x smaller than the sets — the
-    scale story), while its truth needs the full join.  Same md5
-    both engines; one scan for grams, sample-sized joins after."""
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("q496_docs")
-    return spark.sql(_q496_sql("spark").replace("FROM documents",
-                                                "FROM q496_docs"))
-
-
-# --- rank-biased overlap (q497) ------------------------------------------------------
-
-
-def _q497_sql(divop: str) -> str:
-    terms = []
-    for d in range(1, 9):
-        w = 0.5 ** d / d  # (1-p) p^(d-1) / d with p = 1/2
-        terms.append(
-            f"CAST('{w!r}' AS DOUBLE) * CAST(sum(CASE WHEN depth <= {d}"
-            f" THEN 1 ELSE 0 END) AS DOUBLE)"
-        )
-    chain = terms[0]
-    for t in terms[1:]:
-        chain = f"({chain} + {t})"
-    return f"""WITH q AS (SELECT DISTINCT event_id % 10 AS qid
-             FROM events),
-       ds AS (SELECT 0 AS d UNION ALL SELECT 1 UNION ALL SELECT 2
-              UNION ALL SELECT 3 UNION ALL SELECT 4 UNION ALL SELECT 5
-              UNION ALL SELECT 6 UNION ALL SELECT 7),
-       ra AS (SELECT qid, d, (qid * 17 + d * 5) % 40 AS item
-              FROM q CROSS JOIN ds),
-       rb AS (SELECT qid, d,
-                     CASE WHEN d < qid % 9
-                          THEN (qid * 17 + d * 5) % 40
-                          ELSE (qid * 17 + d * 5 + 17) % 40 END AS item
-              FROM q CROSS JOIN ds),
-       mt AS (SELECT ra.qid,
-                     CASE WHEN ra.d > rb.d THEN ra.d ELSE rb.d END + 1
-                       AS depth
-              FROM ra JOIN rb ON rb.qid = ra.qid AND rb.item = ra.item),
-       sc AS (SELECT q.qid, {chain} AS rbo,
-                     CAST(sum(CASE WHEN mt.depth <= 4 THEN 1 ELSE 0 END)
-                       AS BIGINT) AS overlap4,
-                     CAST(sum(CASE WHEN mt.depth <= 8 THEN 1 ELSE 0 END)
-                       AS BIGINT) AS overlap8
-              FROM q LEFT JOIN mt ON mt.qid = q.qid
-              GROUP BY q.qid)
-       SELECT qid, CAST(qid % 9 AS BIGINT) AS k_agree,
-              overlap4, overlap8, rbo
-       FROM sc"""
-
-
-@query("q497_rank_biased_overlap", _q497_sql("//"))
-def q497(spark, sf_dir):
-    """Rank-biased overlap (Webber 2010) — the top-weighted ranking
-    similarity the eval family lacked (Kendall q395 weights all
-    pairs equally; RBO discounts depth geometrically, which is how
-    ranking changes are actually reviewed): RBO@8 with p = 1/2,
-    sum over depths of (1-p) p^(d-1) * overlap_d / d, the depth
-    weights Python-computed and inlined via CAST('…' AS DOUBLE)
-    per the decimal-literal rule and the eight terms added in ONE
-    FIXED left-to-right chain (the q179 order contract); overlap_d
-    comes from a single item equi-join of the two rank lists with
-    depth = max(rank_A, rank_B) + 1 — overlap at every depth from
-    one join, no per-depth rescan.  The two deterministic rankers
-    share an agreement prefix k = qid % 9 then diverge by an offset
-    chosen coprime-safe so list items stay distinct (a +20 offset
-    silently DUPLICATED items inside ranker B via 5(d1-d2) = -20
-    mod 40 — caught in design); rbo rises monotonically with
-    k_agree from 0 to 1, the top-weighting made visible."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q497_events")
-    return spark.sql(_q497_sql("div").replace("FROM events",
-                                              "FROM q497_events"))
-
-
-# --- frecency hot-set scoring (q498) -------------------------------------------------
-
-
-def _q498_sql(divop: str) -> str:
-    return f"""WITH e AS (SELECT user_id % 25 AS host,
-                    (event_id {divop} 625) % 16 AS w
-             FROM events),
-       cw AS (SELECT host, w, CAST(count(*) AS BIGINT) AS c
-              FROM e GROUP BY host, w),
-       sc AS (SELECT host,
-                     CAST(sum(c * CAST(power(2, w) AS BIGINT))
-                       AS BIGINT) AS frecency_x,
-                     CAST(sum(c) AS BIGINT) AS freq
-              FROM cw GROUP BY host),
-       rk AS (SELECT host, frecency_x, freq,
-                     row_number() OVER (ORDER BY frecency_x DESC,
-                                        host ASC) AS r_frec,
-                     row_number() OVER (ORDER BY freq DESC, host ASC)
-                       AS r_freq
-              FROM sc)
-       SELECT host, frecency_x, freq,
-              CAST(r_frec AS BIGINT) AS r_frec,
-              CAST(r_freq AS BIGINT) AS r_freq,
-              CAST(CASE WHEN r_frec <= 8 THEN 1 ELSE 0 END AS BIGINT)
-                AS hot_frec,
-              CAST(CASE WHEN r_freq <= 8 THEN 1 ELSE 0 END AS BIGINT)
-                AS hot_freq,
-              CAST(CASE WHEN (r_frec <= 8) <> (r_freq <= 8)
-                   THEN 1 ELSE 0 END AS BIGINT) AS flipped
-       FROM rk"""
-
-
-@query("q498_frecency_hotset", _q498_sql("//"))
-def q498(spark, sf_dir):
-    """Frecency hot-set scoring — the exponential-decay recency
-    weighting every cache admission / crawl-priority policy uses
-    (q330 planned admission by plain frequency, q371 measured LRU
-    stack distances; frecency is the knob between them), kept EXACT
-    by a DYADIC half-life: weight 2^w per window w means the score
-    is the pure integer sum(count_w * 2^w) — score halves per
-    window of age with no exp() anywhere, the q85 dyadic-weight
-    rule applied to time decay.  Hosts are ranked by frecency and by
-    raw frequency side by side (ties pinned by host id) and the
-    flipped column marks hosts whose top-8 hot-set membership
-    DIFFERS between the two policies — the recency flip is the
-    entire reason frecency exists, and the fixture's event-id
-    windowing makes late-window hosts visibly overtake
-    high-total-count ones.  Two bounded rank windows over the
-    25-host table; counts are one groupBy."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q498_events")
-    return spark.sql(_q498_sql("div").replace("FROM events",
-                                              "FROM q498_events"))
-
-
-# --- distribution-free median confidence interval (q499) -----------------------------
-
-
-def _q499_sql(divop: str) -> str:
-    import math
-    from fractions import Fraction
-
-    n = 20
-    # symmetric order-statistic CI for the median: smallest k with
-    # P(l <= #below <= u) >= 95%, l = k, u = n - k (1-based ranks
-    # k+1 .. n-k); coverage = sum C(n,i)/2^n for i in [k, n-k-1]...
-    # computed exactly with Fractions, inlined.
-    best = None
-    for k in range(1, n // 2):
-        cov = Fraction(
-            sum(math.comb(n, i) for i in range(k, n - k + 1)), 2 ** n)
-        if cov >= Fraction(95, 100):
-            best = (k, cov)  # largest k (tightest) still >= 95%
-    k, cov = best
-    lo_rank, hi_rank = k + 1, n - k
-    y = ("(3 + (2 + s) * x + ((x*x*7 + x*3 + s) % 7 - 3)"
-         " + (CASE WHEN x % 10 = 9 THEN 500 ELSE 0 END))")
-    return f"""WITH pts AS (SELECT DISTINCT event_id % 5 AS s,
-                    (event_id {divop} 5) % 20 AS x
-             FROM events),
-       xy AS (SELECT s, x, CAST({y} AS BIGINT) AS y FROM pts),
-       rk AS (SELECT s, y,
-                     row_number() OVER (PARTITION BY s
-                                        ORDER BY y, x) AS rnk
-              FROM xy),
-       md AS (SELECT a.s, a.y AS ci_lo, b.y AS ci_hi, c.y AS median
-              FROM rk a JOIN rk b ON b.s = a.s JOIN rk c ON c.s = a.s
-              WHERE a.rnk = {lo_rank} AND b.rnk = {hi_rank}
-                AND c.rnk = 10)
-       SELECT s, median, ci_lo, ci_hi,
-              CAST({cov.numerator} AS BIGINT) AS cov_num,
-              CAST({cov.denominator} AS BIGINT) AS cov_den,
-              CAST({cov.numerator} AS DOUBLE)
-                / CAST({cov.denominator} AS DOUBLE) AS coverage,
-              CAST(CASE WHEN ci_lo <= median AND median <= ci_hi
-                   THEN 1 ELSE 0 END AS BIGINT) AS contains_median
-       FROM md"""
-
-
-@query("q499_median_ci", _q499_sql("//"))
-def q499(spark, sf_dir):
-    """Distribution-free median confidence interval — the order-
-    statistic CI that needs NO distributional assumption and NO
-    bootstrap (the sign-test inversion: #points below the true
-    median is Binomial(n, 1/2), so [x_(k+1), x_(n-k)] covers it
-    with probability sum C(n,i)/2^n over i in [k, n-k] — computed
-    EXACTLY in Python Fractions for n = 20, the tightest symmetric
-    interval at >= 95% inlined as cov_num/cov_den BIGINTs): ranks
-    6..15 on the shared contaminated series, value-at-rank
-    semantics, the lower median at rank 10 pinned.  The 10%
-    outliers that wreck a mean +- 2se interval leave this one
-    untouched (order statistics at ranks 6-15 never see rank-19/20
-    values — robustness by construction, the q487 family's
-    inference member); contains_median == 1 rides as the sanity
-    proof.  One rank window per bounded series."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q499_events")
-    return spark.sql(_q499_sql("div").replace("FROM events",
-                                              "FROM q499_events"))
-
-
 # --- geoweb curation pipeline capstone (q500) ----------------------------------------
 
 
@@ -31052,7 +11388,7 @@ def _q500_sql() -> str:
        FROM dens CROSS JOIN tot"""
 
 
-@query("q500_geoweb_pipeline", _q500_sql())
+@query("q500_geoweb_pipeline", _q500_sql(), kind="operator")
 def q500(spark, sf_dir):
     """The geoweb curation pipeline capstone — the north rule's whole
     story as ONE lazy plan (q146 composed the training pipeline,
@@ -31118,571 +11454,6 @@ def q500(spark, sf_dir):
         F.lit(tot[0] - tot[1] - tot[2] - tot[3] - tot[4]).cast("long")
         .alias("resid"),
     )
-
-
-# --- Moran's I spatial autocorrelation (q501) -----------------------------------------
-
-
-def _q501_sql(divop: str) -> str:
-    # event -> lattice cell with a PLANTED smooth gradient along gy
-    # (quadratic inverse sampling: band populations fall like
-    # sqrt(k+1)-sqrt(k)), gx uniform; the scrambled surface carries
-    # the SAME value multiset at hash-permuted locations.
-    return f"""WITH e AS (SELECT event_id % 997 AS t, event_id % 16 AS gx
-              FROM events),
-       pts AS (SELECT gx, (t*t*8) {divop} 994009 AS gy FROM e),
-       cnt AS (SELECT gx, gy, CAST(count(*) AS BIGINT) AS x
-               FROM pts GROUP BY gx, gy),
-       cells AS (SELECT DISTINCT event_id % 128 AS c FROM events),
-       base AS (SELECT c.c, c.c % 16 AS gx, c.c {divop} 16 AS gy,
-                       coalesce(cnt.x, 0) AS x
-                FROM cells c LEFT JOIN cnt
-                  ON cnt.gx = c.c % 16 AND cnt.gy = c.c {divop} 16),
-       surf AS (SELECT 0 AS s, gx, gy, x FROM base
-                UNION ALL
-                SELECT 1 AS s, b.c % 16 AS gx, b.c {divop} 16 AS gy,
-                       p.x
-                FROM base b JOIN base p
-                  ON p.c = (b.c*37 + 11) % 128),
-       stat AS (SELECT s AS ss, CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(x) AS BIGINT) AS sx
-                FROM surf GROUP BY s),
-       z AS (SELECT surf.s, gx, gy, stat.n * x - stat.sx AS z
-             FROM surf JOIN stat ON stat.ss = surf.s),
-       num AS (SELECT a.s AS s1,
-                      CAST(sum(a.z * b.z) AS BIGINT) AS num_raw,
-                      CAST(count(*) AS BIGINT) AS w_sum
-               FROM z a JOIN z b
-                 ON b.s = a.s
-                AND abs(a.gx - b.gx) + abs(a.gy - b.gy) = 1
-               GROUP BY a.s),
-       den AS (SELECT s AS s2, CAST(sum(z*z) AS BIGINT) AS den_raw
-               FROM z GROUP BY s)
-       SELECT s1 AS s, stat.n AS n_cells, num.w_sum, num.num_raw,
-              den.den_raw,
-              CAST(stat.n * num.num_raw AS DOUBLE)
-                / CAST(num.w_sum * den.den_raw AS DOUBLE) AS morans_i,
-              CAST(-1 AS DOUBLE) / CAST(stat.n - 1 AS DOUBLE)
-                AS expect_i,
-              CAST(CASE WHEN stat.n * num.num_raw * (stat.n - 1)
-                             > -(num.w_sum * den.den_raw)
-                   THEN 1 ELSE 0 END AS BIGINT) AS clustered
-       FROM num JOIN den ON den.s2 = num.s1
-       JOIN stat ON stat.ss = num.s1"""
-
-
-@query("q501_morans_i", _q501_sql("//"))
-def q501(spark, sf_dir):
-    """Moran's I spatial autocorrelation — the single number every
-    spatial-analysis stack (GeoDa/PySAL; GDAL feeds them the zonal
-    surfaces) reports first about a lattice surface: I = (n/W) *
-    sum_ij w_ij z_i z_j / sum_i z_i^2, here kept EXACT by clearing
-    the mean with z'_i = n*x_i - sum(x) (so I = n*num/(W*den), one
-    float division at the end).  The web-density surface is a 16x8
-    lattice whose event->cell assignment plants a smooth quadratic
-    gradient along gy (band counts fall like sqrt(k+1)-sqrt(k));
-    the CONTRAST surface carries the same value multiset at
-    hash-permuted cells (c*37+11 mod 128), so the two output rows
-    show I = +0.64 vs -0.20 at sf0.001 — same histogram, opposite
-    verdicts, which is the whole point of the statistic.  Rook
-    adjacency is a self-join on |dgx|+|dgy| = 1 (W emitted);
-    expect_i = -1/(n-1) and the clustered flag cross-multiplies
-    I > E[I] in exact integers.  One groupBy for the counts, one
-    128x128 lattice self-join."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q501_events")
-    return spark.sql(_q501_sql("div").replace("FROM events",
-                                              "FROM q501_events"))
-
-
-# --- Ripley's K point-pattern statistic (q502) ----------------------------------------
-
-_Q502_PTS = """SELECT s, doc_id,
-              CASE WHEN s = 0 AND doc_id % 10 = 7
-                   THEN 10 + (doc_id {d} 10) % 6
-                   WHEN s = 0 THEN (doc_id*37) % 97
-                   ELSE (doc_id*41) % 97 END AS x,
-              CASE WHEN s = 0 AND doc_id % 10 = 7
-                   THEN 12 + ((doc_id {d} 10) * 3) % 6
-                   WHEN s = 0 THEN (doc_id*59) % 89
-                   ELSE (doc_id*67) % 89 END AS y
-       FROM documents CROSS JOIN (SELECT 0 AS s UNION ALL SELECT 1) sv"""
-
-
-def _q502_sql(divop: str) -> str:
-    pts = _Q502_PTS.replace("{d}", divop)
-    return f"""WITH pts AS ({pts}),
-       n AS (SELECT s AS sn, CAST(count(*) AS BIGINT) AS n_pts
-             FROM pts GROUP BY s),
-       pairs AS (SELECT a.s, r.r,
-                        CAST(count(*) AS BIGINT) AS n_pairs
-                 FROM pts a JOIN pts b
-                   ON b.s = a.s AND b.doc_id <> a.doc_id
-                 CROSS JOIN (SELECT 3 AS r UNION ALL SELECT 6
-                             UNION ALL SELECT 12) r
-                 WHERE (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y)
-                       <= r.r*r.r
-                 GROUP BY a.s, r.r),
-       k AS (SELECT r.r, n.n_pts,
-                    coalesce(max(CASE WHEN pairs.s = 0
-                                 THEN pairs.n_pairs END), 0)
-                      AS pairs_planted,
-                    coalesce(max(CASE WHEN pairs.s = 1
-                                 THEN pairs.n_pairs END), 0)
-                      AS pairs_csr
-             FROM (SELECT 3 AS r UNION ALL SELECT 6
-                   UNION ALL SELECT 12) r
-             CROSS JOIN (SELECT n_pts FROM n WHERE sn = 0) n
-             LEFT JOIN pairs ON pairs.r = r.r
-             GROUP BY r.r, n.n_pts)
-       SELECT r, n_pts,
-              CAST(pairs_planted AS BIGINT) AS pairs_planted,
-              CAST(pairs_csr AS BIGINT) AS pairs_csr,
-              CAST(8633 * pairs_planted AS DOUBLE)
-                / CAST(n_pts * (n_pts - 1) AS DOUBLE) AS khat_planted,
-              CAST(8633 * pairs_csr AS DOUBLE)
-                / CAST(n_pts * (n_pts - 1) AS DOUBLE) AS khat_csr,
-              CAST(CASE WHEN pairs_planted > pairs_csr
-                   THEN 1 ELSE 0 END AS BIGINT) AS clustered
-       FROM k"""
-
-
-@query("q502_ripleys_k", _q502_sql("//"))
-def q502(spark, sf_dir):
-    """Ripley's K point-pattern statistic — the multi-scale clustering
-    test (K(r) = A * E[pairs within r] / (n(n-1))) that q501's
-    single-lattice Moran cannot give: K is a CURVE over radii, and
-    clustering shows as K above its CSR twin at every r.  Two point
-    sets share the doc population: the planted set drops every 10th
-    doc into a 6x6 box (the hot cluster) with the rest hash-spread
-    over the 97x89 arena (coprime prime moduli so no forced
-    coincidences — the q352-family lesson: a %100 pair generator
-    collides every 100 ids and plants fake clusters in the CSR
-    twin); the CSR set hash-spreads everything.  Pair counts are
-    EXACT integers (squared-distance compares, ordered pairs); khat
-    = A*pairs/(n(n-1)) is one float division with A = 8633 inlined.
-    The ENGINE counts pairs with a grid-banded join (coarse cell =
-    coord div 12, candidates within the 3x3 cell neighborhood —
-    max r bounds the band, the q11 two-phase spatial-join shape) so
-    candidate volume stays near-linear at corpus scale; the oracle
-    replays the naive quadratic join — identical counts, the
-    distance filter makes the banding invisible."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-    pts = None
-    for s in (0, 1):
-        if s == 0:
-            x = F.when(F.col("doc_id") % 10 == 7,
-                       10 + F.expr("doc_id div 10") % 6
-                       ).otherwise((F.col("doc_id") * 37) % 97)
-            y = F.when(F.col("doc_id") % 10 == 7,
-                       12 + (F.expr("doc_id div 10") * 3) % 6
-                       ).otherwise((F.col("doc_id") * 59) % 89)
-        else:
-            x = (F.col("doc_id") * 41) % 97
-            y = (F.col("doc_id") * 67) % 89
-        part = docs.select(F.lit(s).alias("s"), "doc_id",
-                           x.alias("x"), y.alias("y"))
-        pts = part if pts is None else pts.unionAll(part)
-    pts = pts.withColumn("cx", F.expr("x div 12")) \
-             .withColumn("cy", F.expr("y div 12"))
-    b = pts.select(F.col("s").alias("s2"), F.col("doc_id").alias("doc2"),
-                   F.col("x").alias("x2"), F.col("y").alias("y2"),
-                   F.col("cx").alias("cx2"), F.col("cy").alias("cy2"))
-    cand = pts.join(
-        b,
-        (F.col("s2") == F.col("s")) & (F.col("doc2") != F.col("doc_id"))
-        & (F.abs(F.col("cx2") - F.col("cx")) <= 1)
-        & (F.abs(F.col("cy2") - F.col("cy")) <= 1))
-    d2 = ((F.col("x") - F.col("x2")) * (F.col("x") - F.col("x2"))
-          + (F.col("y") - F.col("y2")) * (F.col("y") - F.col("y2")))
-    radii = spark.range(1).select(
-        F.explode(F.array(F.lit(3), F.lit(6), F.lit(12))).alias("r"))
-    pairs = (cand.crossJoin(F.broadcast(radii))
-             .filter(d2 <= F.col("r") * F.col("r"))
-             .groupBy("s", "r")
-             .agg(F.count("*").cast("long").alias("n_pairs")))
-    n_pts = docs.count()
-    k = (radii.join(pairs, "r", "left")
-         .groupBy("r")
-         .agg(F.coalesce(F.max(F.when(F.col("s") == 0,
-                                      F.col("n_pairs"))), F.lit(0))
-              .alias("pairs_planted"),
-              F.coalesce(F.max(F.when(F.col("s") == 1,
-                                      F.col("n_pairs"))), F.lit(0))
-              .alias("pairs_csr")))
-    return k.select(
-        "r", F.lit(n_pts).cast("long").alias("n_pts"),
-        F.col("pairs_planted").cast("long").alias("pairs_planted"),
-        F.col("pairs_csr").cast("long").alias("pairs_csr"),
-        ((8633 * F.col("pairs_planted")).cast("double")
-         / F.lit(float(n_pts * (n_pts - 1)))).alias("khat_planted"),
-        ((8633 * F.col("pairs_csr")).cast("double")
-         / F.lit(float(n_pts * (n_pts - 1)))).alias("khat_csr"),
-        F.when(F.col("pairs_planted") > F.col("pairs_csr"), 1)
-        .otherwise(0).cast("long").alias("clustered"))
-
-
-# --- Local spatial statistics over the shared web-density lattice ---------------------
-#
-# q503-q505 reuse q501's 16x8 lattice pair (planted quadratic gradient
-# vs hash-permuted scramble of the SAME value multiset) and add the
-# LOCAL statistics GDAL's zonal surfaces feed into GeoDa/PySAL: the
-# Getis-Ord Gi* hot-spot z-score, Geary's C contiguity ratio, and the
-# LISA local-Moran quadrant decomposition.  All three keep the engine
-# and oracle on ONE shared SQL text (divop-parametrized, the q501
-# pattern) so the IEEE expression trees are identical by construction.
-
-
-def _lattice_cte(divop: str, tbl: str) -> str:
-    """Shared lattice WITH-clause body: surf(s, c, gx, gy, x) for the
-    planted (s=0) and scrambled (s=1) surfaces + stat(ss, n, sx, sxx).
-
-    Unlike q501's free-running gradient this one truncates the tail
-    (t < 880): the gy=7 row is then EXACTLY empty, so the planted
-    surface carries a cold stripe deep enough for Gi* cold flags to
-    fire — the untruncated top band sat at z ~ -1.53, a hair above
-    the -1.645 bar, leaving the cold branch dead (the degenerate-knob
-    inspection again)."""
-    return f"""e AS (SELECT event_id % 997 AS t, event_id % 16 AS gx
-              FROM {tbl}),
-       pts AS (SELECT gx, (t*t*8) {divop} 994009 AS gy FROM e
-               WHERE t < 880),
-       cnt AS (SELECT gx, gy, CAST(count(*) AS BIGINT) AS x
-               FROM pts GROUP BY gx, gy),
-       cells AS (SELECT DISTINCT event_id % 128 AS c FROM {tbl}),
-       base AS (SELECT c.c, c.c % 16 AS gx, c.c {divop} 16 AS gy,
-                       coalesce(cnt.x, 0) AS x
-                FROM cells c LEFT JOIN cnt
-                  ON cnt.gx = c.c % 16 AND cnt.gy = c.c {divop} 16),
-       surf AS (SELECT 0 AS s, c, gx, gy, x FROM base
-                UNION ALL
-                SELECT 1 AS s, b.c, b.c % 16 AS gx, b.c {divop} 16 AS gy,
-                       p.x
-                FROM base b JOIN base p
-                  ON p.c = (b.c*37 + 11) % 128),
-       stat AS (SELECT s AS ss, CAST(count(*) AS BIGINT) AS n,
-                       CAST(sum(x) AS BIGINT) AS sx,
-                       CAST(sum(x*x) AS BIGINT) AS sxx
-                FROM surf GROUP BY s)"""
-
-
-def _q503_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH {_lattice_cte(divop, tbl)},
-       loc AS (SELECT a.s, a.c, a.x,
-                      CAST(sum(b.x) AS BIGINT) AS l_i,
-                      CAST(count(*) AS BIGINT) AS n_i
-               FROM surf a JOIN surf b
-                 ON b.s = a.s
-                AND abs(a.gx - b.gx) + abs(a.gy - b.gy) <= 1
-               GROUP BY a.s, a.c, a.x),
-       z AS (SELECT loc.s, loc.c, loc.x, l_i, n_i,
-                    CAST(stat.n * l_i - stat.sx * n_i AS DOUBLE)
-                      / (sqrt(CAST(stat.n * stat.sxx
-                                   - stat.sx * stat.sx AS DOUBLE))
-                         * sqrt(CAST(n_i * (stat.n - n_i) AS DOUBLE)
-                                / CAST(stat.n - 1 AS DOUBLE))) AS gi_z
-             FROM loc JOIN stat ON stat.ss = loc.s)
-       SELECT s, c, x, l_i, n_i, gi_z,
-              CAST(CASE WHEN gi_z > 1.645 THEN 1 ELSE 0 END AS BIGINT)
-                AS hot,
-              CAST(CASE WHEN gi_z < -1.645 THEN 1 ELSE 0 END AS BIGINT)
-                AS cold
-       FROM z"""
-
-
-@query("q503_getis_ord_gistar", _q503_sql("//"))
-def q503(spark, sf_dir):
-    """Getis-Ord Gi* hot-spot statistic — the per-cell z-score behind
-    every "hot spot analysis" toolbox (Getis & Ord 1992; fed by the
-    zonal surfaces GDAL produces): Gi* sums the rook+SELF neighborhood
-    and standardizes against the global mean/variance, z_i =
-    (n*L_i - SX*n_i) / (sqrt(n*SXX - SX^2) * sqrt(n_i(n-n_i)/(n-1)))
-    — numerator an exact BIGINT cross-multiplication, denominator two
-    IEEE sqrt of exact-integer inputs, so both engines compute
-    bit-identical doubles from the ONE shared SQL text (divop
-    parametrization, the q501 pattern).  On the planted gradient the
-    low-gy band lights up as a CONTIGUOUS hot stripe (z up to ~+10)
-    and the emptied gy=7 row goes cold (both flag branches fire —
-    the first cut's free-running gradient left cold dead at z ~
-    -1.53); the hash-scrambled twin still flags a FEW isolated cells
-    (self-inclusion lets a singleton spike report its own
-    neighborhood — real Gi* behavior) but no contiguous region:
-    local statistics see the ARRANGEMENT, not the histogram.  One
-    events groupBy for the surface, one 128-cell lattice self-join
-    (<=5 neighbors/cell); at corpus scale the lattice side is a
-    broadcast dim."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q503_events")
-    return spark.sql(_q503_sql("div", "q503_events"))
-
-
-def _q504_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH {_lattice_cte(divop, tbl)},
-       sq AS (SELECT a.s AS s1,
-                     CAST(sum((a.x - b.x)*(a.x - b.x)) AS BIGINT)
-                       AS sq_num,
-                     CAST(count(*) AS BIGINT) AS w_sum
-              FROM surf a JOIN surf b
-                ON b.s = a.s
-               AND abs(a.gx - b.gx) + abs(a.gy - b.gy) = 1
-              GROUP BY a.s)
-       SELECT s1 AS s, stat.n AS n_cells, sq.w_sum, sq.sq_num,
-              CAST(stat.n * stat.sxx - stat.sx * stat.sx AS BIGINT)
-                AS den_raw,
-              CAST(stat.n * (stat.n - 1) * sq.sq_num AS DOUBLE)
-                / CAST(2 * sq.w_sum
-                       * (stat.n * stat.sxx - stat.sx * stat.sx)
-                       AS DOUBLE) AS gearys_c,
-              CAST(CASE WHEN stat.n * (stat.n - 1) * sq.sq_num
-                             < 2 * sq.w_sum * (stat.n * stat.sxx
-                                               - stat.sx * stat.sx)
-                   THEN 1 ELSE 0 END AS BIGINT) AS clustered
-       FROM sq JOIN stat ON stat.ss = sq.s1"""
-
-
-@query("q504_gearys_c", _q504_sql("//"))
-def q504(spark, sf_dir):
-    """Geary's C contiguity ratio — Moran's complement (Geary 1954):
-    C = n(n-1) * sum_rook (x_i - x_j)^2 / (2W * (n*SXX - SX^2)),
-    sensitive to LOCAL squared differences where Moran measures
-    global covariance, and mean-free in the numerator (no z-clearing
-    needed — the pairwise difference cancels the mean by itself).
-    Every term is an exact BIGINT product (~1e11 at sf0.01, well
-    inside the 2^63 budget) and C is ONE float division at the end;
-    the clustered flag (C < 1 = positive autocorrelation) is decided
-    by exact integer cross-multiplication, never the float.  The
-    planted gradient scores C ~ 0.4, its same-histogram scramble
-    C > 1 — and the verdict pair must INVERT q501's Moran signs,
-    which the fixture exercises (both statistics emitted from the
-    same lattice, opposite functional forms).  Same single-shuffle
-    profile as q501."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q504_events")
-    return spark.sql(_q504_sql("div", "q504_events"))
-
-
-def _q505_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH {_lattice_cte(divop, tbl)},
-       z AS (SELECT surf.s, c, gx, gy,
-                    stat.n * x - stat.sx AS zc
-             FROM surf JOIN stat ON stat.ss = surf.s),
-       lisa AS (SELECT a.s, a.c, a.zc,
-                       CAST(sum(b.zc) AS BIGINT) AS lag_z,
-                       CAST(a.zc * sum(b.zc) AS BIGINT) AS local_i
-                FROM z a JOIN z b
-                  ON b.s = a.s
-                 AND abs(a.gx - b.gx) + abs(a.gy - b.gy) = 1
-                GROUP BY a.s, a.c, a.zc),
-       quad AS (SELECT s, c, local_i,
-                       CASE WHEN zc > 0 AND lag_z > 0 THEN 'HH'
-                            WHEN zc < 0 AND lag_z < 0 THEN 'LL'
-                            WHEN zc > 0 AND lag_z < 0 THEN 'HL'
-                            WHEN zc < 0 AND lag_z > 0 THEN 'LH'
-                            ELSE 'EQ' END AS quadrant
-                FROM lisa),
-       agg AS (SELECT s, quadrant,
-                      CAST(count(*) AS BIGINT) AS n_cells,
-                      CAST(sum(local_i) AS BIGINT) AS sum_local
-               FROM quad GROUP BY s, quadrant),
-       tot AS (SELECT s AS ts, CAST(sum(local_i) AS BIGINT) AS tot_local
-               FROM quad GROUP BY s),
-       moran AS (SELECT a.s AS ms,
-                        CAST(sum(a.zc * b.zc) AS BIGINT) AS num_raw
-                 FROM z a JOIN z b
-                   ON b.s = a.s
-                  AND abs(a.gx - b.gx) + abs(a.gy - b.gy) = 1
-                 GROUP BY a.s)
-       SELECT agg.s, agg.quadrant, agg.n_cells, agg.sum_local,
-              tot.tot_local, moran.num_raw,
-              CAST(tot.tot_local - moran.num_raw AS BIGINT) AS resid
-       FROM agg JOIN tot ON tot.ts = agg.s
-       JOIN moran ON moran.ms = agg.s"""
-
-
-@query("q505_lisa_quadrants", _q505_sql("//"))
-def q505(spark, sf_dir):
-    """LISA local-Moran quadrant decomposition (Anselin 1995) — the
-    per-cell breakdown q501's global I averages away: local_i =
-    z'_i * sum_rook z'_j with the mean cleared exactly as z' =
-    n*x - SX (all BIGINT, products ~2e9), each cell classified into
-    the Moran-scatterplot quadrant (HH hot cluster / LL cold cluster
-    / HL-LH spatial outliers) by exact integer SIGNS.  The output
-    carries Anselin's decomposition identity as a data-dependent
-    proof: sum of local_i over all cells EQUALS the global Moran
-    numerator, recomputed independently in the same query — resid
-    == 0 on every row (the q500 conservation pattern).  The planted
-    gradient concentrates mass in HH+LL with positive sum_local;
-    the scramble scatters cells across all four quadrants with the
-    outlier quadrants dominating the sum (negative num_raw).  One
-    groupBy + two 128-cell lattice self-joins, both broadcast-scale
-    at any corpus size."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q505_events")
-    return spark.sql(_q505_sql("div", "q505_events"))
-
-
-# --- Lattice & point-pattern statistics II (q506-q508) --------------------------------
-
-
-def _q506_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH {_lattice_cte(divop, tbl)},
-       bw AS (SELECT surf.s, c, gx, gy,
-                     CASE WHEN stat.n * x > stat.sx
-                          THEN 1 ELSE 0 END AS blk
-              FROM surf JOIN stat ON stat.ss = surf.s),
-       nb AS (SELECT s AS sb, CAST(sum(blk) AS BIGINT) AS n_black,
-                     CAST(count(*) - sum(blk) AS BIGINT) AS n_white
-              FROM bw GROUP BY s),
-       joins AS (SELECT a.s AS sj,
-                        CAST(sum(a.blk * b.blk) AS BIGINT) AS bb,
-                        CAST(sum((1-a.blk) * (1-b.blk)) AS BIGINT) AS ww,
-                        CAST(sum(a.blk + b.blk
-                                 - 2*a.blk*b.blk) AS BIGINT) AS bw_j,
-                        CAST(count(*) AS BIGINT) AS w_sum
-                 FROM bw a JOIN bw b
-                   ON b.s = a.s
-                  AND abs(a.gx - b.gx) + abs(a.gy - b.gy) = 1
-                 GROUP BY a.s)
-       SELECT sj AS s, n_black, n_white, bb, ww, bw_j, w_sum,
-              CAST(bb * stat.n * (stat.n - 1) AS BIGINT) AS bb_obs_x,
-              CAST(w_sum * n_black * (n_black - 1) AS BIGINT)
-                AS bb_exp_x,
-              CAST(w_sum * n_black * (n_black - 1) AS DOUBLE)
-                / CAST(stat.n * (stat.n - 1) AS DOUBLE) AS bb_expected,
-              CAST(CASE WHEN bb * stat.n * (stat.n - 1)
-                             > w_sum * n_black * (n_black - 1)
-                   THEN 1 ELSE 0 END AS BIGINT) AS clustered
-       FROM joins JOIN nb ON nb.sb = joins.sj
-       JOIN stat ON stat.ss = joins.sj"""
-
-
-@query("q506_join_counts", _q506_sql("//"))
-def q506(spark, sf_dir):
-    """Join-count statistics — the autocorrelation test for BINARY
-    surfaces (Cliff & Ord 1973; what Moran/Geary are to interval
-    data): threshold each lattice cell black iff n*x > SX (above the
-    mean, exact cross-multiplication — no float mean ever
-    materializes), then count BB / WW / BW rook joins as pure
-    integer sums over the ordered-pair self-join (blk products give
-    all three in ONE pass: bb = sum(a*b), bw = sum(a+b-2ab)).  The
-    free-sampling expectation E[BB] = W*nB(nB-1)/(n(n-1)) is carried
-    both as a float and as the exact cross-multiplied pair
-    (bb_obs_x vs bb_exp_x) deciding the clustered flag in integers.
-    The planted gradient's black cells form a contiguous low-gy
-    block (BB far above expectation, BW starved); the scramble's
-    same-count black set scatters to near-independence.  Same
-    broadcast-scale lattice self-join as q503-q505."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q506_events")
-    return spark.sql(_q506_sql("div", "q506_events"))
-
-
-def _q507_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH {_lattice_cte(divop, tbl)},
-       lags AS (SELECT 1 AS h UNION ALL SELECT 2
-                UNION ALL SELECT 3 UNION ALL SELECT 4),
-       pair AS (SELECT a.s, lags.h,
-                       CAST(count(*) AS BIGINT) AS n_pairs,
-                       CAST(sum((a.x - b.x)*(a.x - b.x)) AS BIGINT)
-                         AS sq_sum
-                FROM surf a JOIN surf b ON b.s = a.s
-                CROSS JOIN lags
-                WHERE (abs(a.gx - b.gx) = lags.h AND a.gy = b.gy)
-                   OR (a.gx = b.gx AND abs(a.gy - b.gy) = lags.h)
-                GROUP BY a.s, lags.h),
-       gam AS (SELECT s, h, n_pairs, sq_sum,
-                      CAST(sq_sum AS DOUBLE)
-                        / CAST(2 * n_pairs AS DOUBLE) AS gamma
-               FROM pair)
-       SELECT g.s, g.h, g.n_pairs, g.sq_sum, g.gamma,
-              CAST(CASE WHEN p.h IS NULL THEN 1
-                        WHEN g.sq_sum * p.n_pairs > p.sq_sum * g.n_pairs
-                        THEN 1 ELSE 0 END AS BIGINT) AS rising
-       FROM gam g LEFT JOIN gam p
-         ON p.s = g.s AND p.h = g.h - 1"""
-
-
-@query("q507_semivariogram", _q507_sql("//"))
-def q507(spark, sf_dir):
-    """Empirical semivariogram — the function kriging fits before it
-    interpolates (Matheron 1963; the geostatistics companion to
-    GDAL's IDW gridding in q24/q120): gamma(h) = sum over pairs at
-    axis-aligned lag h of (x_i - x_j)^2 / (2*N(h)), for h = 1..4 on
-    the lattice pair.  Pair sums and counts are exact BIGINTs from
-    one banded self-join (the lag set is a 4-row broadcast dim);
-    gamma is one float division per row.  The structure signature is
-    the RISING flag, decided per consecutive-lag pair by exact
-    cross-multiplication sq(h)*N(h-1) > sq(h-1)*N(h): the planted
-    gradient's variogram climbs monotonically (rising = 1 at every
-    lag — spatial continuity with range beyond the lattice), while
-    the scramble is a pure-nugget flat line whose rising flags
-    flicker — the two textbook variogram shapes from one value
-    multiset."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q507_events")
-    return spark.sql(_q507_sql("div", "q507_events"))
-
-
-def _q508_sql(divop: str) -> str:
-    return f"""WITH pts AS (
-         SELECT s, doc_id,
-                CASE WHEN s = 0 AND doc_id % 10 = 7
-                     THEN 48 + (doc_id {divop} 10) % 6
-                     WHEN s = 0 THEN (doc_id*41) % 96
-                     ELSE (doc_id % 24)*4 + 1 END AS x,
-                CASE WHEN s = 0 AND doc_id % 10 = 7
-                     THEN 36 + ((doc_id {divop} 10) * 3) % 6
-                     WHEN s = 0 THEN (doc_id*67) % 84
-                     ELSE ((doc_id {divop} 24) % 21)*4 + 1 END AS y
-         FROM documents
-         CROSS JOIN (SELECT 0 AS s UNION ALL SELECT 1) sv),
-       d AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2
-             UNION ALL SELECT 3 UNION ALL SELECT 4 UNION ALL SELECT 5
-             UNION ALL SELECT 6 UNION ALL SELECT 7),
-       uni AS (SELECT a.i AS qx, b.i AS qy FROM d a JOIN d b
-               ON b.i < 7),
-       qc AS (SELECT s, x {divop} 12 AS qx, y {divop} 12 AS qy,
-                     CAST(count(*) AS BIGINT) AS cq
-              FROM pts GROUP BY s, x {divop} 12, y {divop} 12),
-       grid AS (SELECT sv.s, uni.qx, uni.qy, coalesce(qc.cq, 0) AS cq
-                FROM uni CROSS JOIN (SELECT 0 AS s UNION ALL
-                                     SELECT 1) sv
-                LEFT JOIN qc ON qc.s = sv.s AND qc.qx = uni.qx
-                            AND qc.qy = uni.qy),
-       agg AS (SELECT s, CAST(count(*) AS BIGINT) AS n_quadrats,
-                      CAST(sum(cq) AS BIGINT) AS sum_c,
-                      CAST(sum(cq*cq) AS BIGINT) AS sum_c2,
-                      CAST(max(cq) AS BIGINT) AS max_c
-               FROM grid GROUP BY s)
-       SELECT s, n_quadrats, sum_c, sum_c2, max_c,
-              CAST(n_quadrats * sum_c2 - sum_c * sum_c AS DOUBLE)
-                / CAST((n_quadrats - 1) * sum_c AS DOUBLE) AS vmr,
-              CAST(CASE WHEN n_quadrats * sum_c2 - sum_c * sum_c
-                             > (n_quadrats - 1) * sum_c
-                   THEN 1 ELSE 0 END AS BIGINT) AS clustered
-       FROM agg"""
-
-
-@query("q508_quadrat_vmr", _q508_sql("//"))
-def q508(spark, sf_dir):
-    """Quadrat variance-mean-ratio test — the count-based
-    point-pattern test that predates Ripley (Greig-Smith 1952): bin
-    two point sets into the FULL 8x7 grid of 12x12 quadrats
-    (INCLUDING empty ones — the universe is generated, not observed;
-    dropping silent empties biases VMR upward) and compare the count
-    variance to its Poisson-expected mean.  VMR = (Q*sum_c2 -
-    sum_c^2)/((Q-1)*sum_c) is one float division over exact BIGINTs,
-    and the clustered verdict (VMR > 1) is the same inequality
-    cross-multiplied in integers.  TWO implementation traps are
-    pinned by the design: the 96x84 arena divides EXACTLY by the
-    quadrat size — the first cut's 97x89 arena left 1-px sliver
-    quadrats along two edges whose unequal areas inflated even a
-    regular grid's VMR to 1.5-2.0, destroying the contrast (the
-    degenerate-knob inspection) — and the contrast twin is an
-    explicitly REGULAR 24x21 stride-4 grid (the textbook inhibited
-    pattern, VMR = 0.02), not a hash 'CSR' whose VMR just wobbles
-    around 1 with no deterministic side.  The planted set's 6x6 hot
-    box piles ~50 points into one quadrat: VMR = 4.7 with max_c =
-    56 as the smoking gun, verdicts 1 vs 0.  One groupBy per set +
-    a broadcast 56-row universe join."""
-    docs = _t(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("q508_documents")
-    return spark.sql(_q508_sql("div").replace("FROM documents",
-                                              "FROM q508_documents"))
 
 
 # --- DBSCAN density clustering (q509) --------------------------------------------------
@@ -31775,7 +11546,7 @@ def _q509_oracle() -> str:
        FROM cls CROSS JOIN tot CROSS JOIN npts CROSS JOIN conv"""
 
 
-@query("q509_dbscan", _q509_oracle())
+@query("q509_dbscan", _q509_oracle(), kind="operator")
 def q509(spark, sf_dir):
     """DBSCAN density clustering (Ester 1996) — the geo-clustering
     primitive (eps^2 = 2, minPts = 7 incl self) with the definition's
@@ -31880,10586 +11651,6 @@ def q509(spark, sf_dir):
         F.lit(changed).cast("long").alias("conv_resid"))
 
 
-# --- Knox space-time interaction + Mann-Kendall trends (q510-q511) --------------------
-
-
-def _q510_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH ev AS (SELECT event_id {divop} 10 AS k FROM {tbl}
-                WHERE event_id % 10 = 0),
-       pts AS (SELECT s, k,
-                      CASE WHEN s = 0 AND k % 50 = 3
-                           THEN 40 + (k {divop} 50) % 5
-                           ELSE (k*37) % 97 END AS x,
-                      CASE WHEN s = 0 AND k % 50 = 3
-                           THEN 40 + (k {divop} 250) % 5
-                           ELSE (k*59) % 89 END AS y,
-                      CASE WHEN s = 0 AND k % 50 = 3
-                           THEN 300 + (k {divop} 50) % 30
-                           ELSE (k*7) % 1440 END AS t
-               FROM ev CROSS JOIN (SELECT 0 AS s UNION ALL
-                                   SELECT 1) sv),
-       n AS (SELECT s AS sn, CAST(count(*) AS BIGINT) AS n_evt
-             FROM pts GROUP BY s),
-       agg AS (SELECT a.s,
-                      CAST(sum(CASE WHEN (a.x-b.x)*(a.x-b.x)
-                                         + (a.y-b.y)*(a.y-b.y) <= 8
-                               THEN 1 ELSE 0 END) AS BIGINT) AS ns,
-                      CAST(sum(CASE WHEN abs(a.t-b.t) <= 10
-                               THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-                      CAST(sum(CASE WHEN (a.x-b.x)*(a.x-b.x)
-                                         + (a.y-b.y)*(a.y-b.y) <= 8
-                                     AND abs(a.t-b.t) <= 10
-                               THEN 1 ELSE 0 END) AS BIGINT) AS nst
-               FROM pts a JOIN pts b
-                 ON b.s = a.s AND b.k <> a.k
-               GROUP BY a.s)
-       SELECT agg.s, n.n_evt,
-              CAST(n.n_evt * (n.n_evt - 1) AS BIGINT) AS np,
-              agg.ns, agg.nt, agg.nst,
-              CAST(agg.ns AS DOUBLE) * CAST(agg.nt AS DOUBLE)
-                / CAST(n.n_evt * (n.n_evt - 1) AS DOUBLE)
-                AS knox_expected,
-              CAST(CASE WHEN agg.nst * n.n_evt * (n.n_evt - 1)
-                             > agg.ns * agg.nt
-                   THEN 1 ELSE 0 END AS BIGINT) AS interacting
-       FROM agg JOIN n ON n.sn = agg.s"""
-
-
-@query("q510_knox_spacetime", _q510_sql("//"))
-def q510(spark, sf_dir):
-    """Knox space-time interaction test (Knox 1964; the outbreak /
-    burst detector behind disease-cluster surveillance): count event
-    pairs close in space (d^2 <= 8) AND close in time (|dt| <= 10
-    min) and compare against the independence expectation ns*nt/np.
-    All four pair counts are exact BIGINTs; the interacting verdict
-    is the exact integer cross-multiplication nst*np > ns*nt — the
-    float expectation rides along for display only.  The planted
-    surface drops every 50th sampled event into a 5x5 box within a
-    30-minute window (burst coordinates derive from k div 50, NOT
-    k % 5 — the q323/q351 gcd trap: any %5 selector is CONSTANT on
-    a class defined by %50); its twin runs the same background hash
-    with no burst and lands BELOW expectation (background space and
-    time coordinates share the generator, so the only correlated
-    pairs are the planted ones).  ENGINE: the quadratic pair space
-    is never materialized — counts aggregate by position (<= 8633
-    distinct), by minute (1440), and by joint key, then band-join
-    within the threshold radius and subtract the n self-pairs; the
-    oracle replays the naive O(n^2) join."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q510_events")
-    ev = spark.sql(
-        f"""SELECT s, k,
-              CASE WHEN s = 0 AND k % 50 = 3 THEN 40 + (k div 50) % 5
-                   ELSE (k*37) % 97 END AS x,
-              CASE WHEN s = 0 AND k % 50 = 3 THEN 40 + (k div 250) % 5
-                   ELSE (k*59) % 89 END AS y,
-              CASE WHEN s = 0 AND k % 50 = 3 THEN 300 + (k div 50) % 30
-                   ELSE (k*7) % 1440 END AS t
-            FROM (SELECT event_id div 10 AS k FROM q510_events
-                  WHERE event_id % 10 = 0)
-            CROSS JOIN (SELECT 0 AS s UNION ALL SELECT 1) sv""")
-    ev = ev.localCheckpoint()
-    n_by_s = {r["s"]: r["n"] for r in
-              ev.groupBy("s").agg(F.count("*").alias("n")).collect()}
-
-    def _band_pairs(df, keys, cells, cond):
-        lhs = df.groupBy(*keys).agg(F.count("*").alias("c1"))
-        for c, expr in cells.items():
-            lhs = lhs.withColumn(c, F.expr(expr))
-        rhs = lhs.select(
-            [F.col(k).alias(k + "2") for k in keys]
-            + [F.col("c1").alias("c2")]
-            + [F.col(c).alias(c + "2") for c in cells])
-        on = F.lit(True)
-        for c in cells:
-            on = on & (F.abs(F.col(c + "2") - F.col(c)) <= 1)
-        return (lhs.join(rhs, on).filter(cond)
-                .groupBy(keys[0] if keys[0] == "s" else "s")
-                .agg(F.sum(F.col("c1") * F.col("c2")).alias("tot")))
-
-    sp = _band_pairs(
-        ev, ["s", "x", "y"], {"bx": "x div 3", "by": "y div 3"},
-        (F.col("s2") == F.col("s"))
-        & ((F.col("x") - F.col("x2")) * (F.col("x") - F.col("x2"))
-           + (F.col("y") - F.col("y2")) * (F.col("y") - F.col("y2"))
-           <= 8))
-    tm = _band_pairs(
-        ev, ["s", "t"], {"bt": "t div 10"},
-        (F.col("s2") == F.col("s"))
-        & (F.abs(F.col("t") - F.col("t2")) <= 10))
-    st = _band_pairs(
-        ev, ["s", "x", "y", "t"],
-        {"bx": "x div 3", "by": "y div 3", "bt": "t div 10"},
-        (F.col("s2") == F.col("s"))
-        & ((F.col("x") - F.col("x2")) * (F.col("x") - F.col("x2"))
-           + (F.col("y") - F.col("y2")) * (F.col("y") - F.col("y2"))
-           <= 8)
-        & (F.abs(F.col("t") - F.col("t2")) <= 10))
-    out = (sp.withColumnRenamed("tot", "ns_raw")
-           .join(tm.withColumnRenamed("tot", "nt_raw"), "s")
-           .join(st.withColumnRenamed("tot", "nst_raw"), "s"))
-    n_col = F.when(F.col("s") == 0, n_by_s[0]).otherwise(n_by_s[1])
-    return out.select(
-        "s", n_col.cast("long").alias("n_evt"),
-        (n_col * (n_col - 1)).cast("long").alias("np"),
-        (F.col("ns_raw") - n_col).cast("long").alias("ns"),
-        (F.col("nt_raw") - n_col).cast("long").alias("nt"),
-        (F.col("nst_raw") - n_col).cast("long").alias("nst"),
-        ((F.col("ns_raw") - n_col).cast("double")
-         * (F.col("nt_raw") - n_col).cast("double")
-         / (n_col * (n_col - 1)).cast("double")).alias("knox_expected"),
-        F.when((F.col("nst_raw") - n_col) * n_col * (n_col - 1)
-               > (F.col("ns_raw") - n_col) * (F.col("nt_raw") - n_col),
-               1).otherwise(0).cast("long").alias("interacting"))
-
-
-def _q511_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH ev AS (SELECT event_id % 128 AS cell,
-                      (event_id * 31) % 97 AS u,
-                      (event_id * 31) % 96 AS u96
-               FROM {tbl}),
-       asg AS (SELECT cell,
-                      CASE WHEN cell < 32
-                           THEN 7 - (u*u*8) {divop} 9409
-                           ELSE u96 % 8 END AS ep
-               FROM ev),
-       cnt AS (SELECT cell, ep, CAST(count(*) AS BIGINT) AS c
-               FROM asg GROUP BY cell, ep),
-       cells AS (SELECT DISTINCT cell FROM ev),
-       eps AS (SELECT 0 AS ep UNION ALL SELECT 1 UNION ALL SELECT 2
-               UNION ALL SELECT 3 UNION ALL SELECT 4 UNION ALL
-               SELECT 5 UNION ALL SELECT 6 UNION ALL SELECT 7),
-       grid AS (SELECT cells.cell, eps.ep, coalesce(cnt.c, 0) AS c
-                FROM cells CROSS JOIN eps
-                LEFT JOIN cnt ON cnt.cell = cells.cell
-                            AND cnt.ep = eps.ep),
-       mk AS (SELECT a.cell,
-                     CAST(sum(CASE WHEN b.c > a.c THEN 1
-                              WHEN b.c < a.c THEN -1
-                              ELSE 0 END) AS BIGINT) AS s_stat
-              FROM grid a JOIN grid b
-                ON b.cell = a.cell AND b.ep > a.ep
-              GROUP BY a.cell),
-       ties AS (SELECT cell,
-                       CAST(sum(tk*(tk-1)*(2*tk+5)) AS BIGINT) AS tie18
-                FROM (SELECT cell, c, CAST(count(*) AS BIGINT) AS tk
-                      FROM grid GROUP BY cell, c) g
-                GROUP BY cell),
-       verdict AS (SELECT mk.cell, mk.s_stat,
-                          1176 - ties.tie18 AS var18,
-                          CASE WHEN 18000000 * mk.s_stat * mk.s_stat
-                                    > 2706025 * (1176 - ties.tie18)
-                               THEN 1 ELSE 0 END AS trending,
-                          CASE WHEN mk.s_stat > 0 THEN 1
-                               WHEN mk.s_stat < 0 THEN -1
-                               ELSE 0 END AS direction
-                   FROM mk JOIN ties ON ties.cell = mk.cell)
-       SELECT CAST(CASE WHEN cell < 32 THEN 1 ELSE 0 END AS BIGINT)
-                AS planted,
-              CAST(trending AS BIGINT) AS trending,
-              CAST(direction AS BIGINT) AS direction,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(min(s_stat) AS BIGINT) AS min_s,
-              CAST(max(s_stat) AS BIGINT) AS max_s,
-              CAST(min(var18) AS BIGINT) AS min_var18
-       FROM verdict
-       GROUP BY CASE WHEN cell < 32 THEN 1 ELSE 0 END,
-                trending, direction"""
-
-
-@query("q511_mann_kendall_hotspots", _q511_sql("//"))
-def q511(spark, sf_dir):
-    """Mann-Kendall emerging-hot-spot detection — the trend test
-    behind "emerging hot spot analysis" (Mann 1945 / Kendall's S
-    over each cell's epoch series; the time axis q503's static Gi*
-    lacks): per lattice cell, S = sum over epoch pairs of
-    sign(c_j - c_i) — a pure integer double-count over the 8-epoch
-    grid INCLUDING zero epochs (the generated-universe rule again)
-    — with the full TIE-CORRECTED variance 18*Var = T(T-1)(2T+5) -
-    sum t(t-1)(2t+5) computed exactly from per-cell value-group
-    sizes.  Significance at |z| > 1.645 is decided entirely in
-    integers: 18e6 * S^2 > 2706025 * var18 (2.706025 = 1.645^2
-    exactly, the rational-threshold trick), and an all-tied cell
-    (var18 = 0, S = 0) falls out as non-trending with no division
-    ever attempted.  Cells 0-31 draw their epoch from a REVERSED
-    quadratic ramp (band populations rise 6->35 per 97 — the epoch
-    hash mixes via eid*31 so low-SF event ranges still cover the
-    residue space), the rest uniform via a SEPARATE mod-96 hash —
-    the first cut fed the background u % 8 with u drawn mod 97, and
-    97 % 8 = 1 hands epoch 0 an extra residue class: a systematic
-    DECAY artifact that flagged 20 background cells trending down
-    (the degenerate-knob inspection applied to the NULL side, not
-    just the planted side); mod 96 gives every epoch exactly 12
-    residues.  The output is the confusion matrix (planted x
-    trending x direction) with min/max S per group as
-    data-dependent extremes.  One groupBy over
-    events + a 28-pair-per-cell epoch-grid self-join; everything
-    downstream of the count table is broadcast-scale."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView("q511_events")
-    return spark.sql(_q511_sql("div", "q511_events"))
-
-
-# --- Clark-Evans NN, proximity graphs, Huff market areas (q512-q514) -------------------
-
-# CSR median nearest-neighbor SQUARED distance for n=500 on 96x84:
-# median NN dist of a Poisson process is sqrt(ln2/(pi*lambda)), so the
-# squared threshold is ln2/(pi*500/8064) — Python-computed once and
-# inlined verbatim on both engines (the q73 literal rule).
-_Q512_CSR_MED_D2 = "3.558410959261965"
-
-
-def _q512_sql(divop: str) -> str:
-    return f"""WITH pts AS (
-         SELECT s, doc_id,
-                CASE WHEN s = 0 AND doc_id % 10 = 7
-                     THEN 48 + (doc_id {divop} 10) % 6
-                     WHEN s = 0 THEN (doc_id*41) % 96
-                     ELSE (doc_id % 24)*4 + 1 END AS x,
-                CASE WHEN s = 0 AND doc_id % 10 = 7
-                     THEN 36 + ((doc_id {divop} 10) * 3) % 6
-                     WHEN s = 0 THEN (doc_id*67) % 84
-                     ELSE ((doc_id {divop} 24) % 21)*4 + 1 END AS y
-         FROM documents
-         CROSS JOIN (SELECT 0 AS s UNION ALL SELECT 1) sv),
-       nn AS (SELECT a.s, a.doc_id,
-                     CAST(min((a.x-b.x)*(a.x-b.x)
-                              + (a.y-b.y)*(a.y-b.y)) AS BIGINT) AS d2
-              FROM pts a JOIN pts b
-                ON b.s = a.s AND b.doc_id <> a.doc_id
-              GROUP BY a.s, a.doc_id),
-       rk AS (SELECT s, d2,
-                     row_number() OVER (PARTITION BY s ORDER BY d2)
-                       AS rnk
-              FROM nn),
-       med AS (SELECT s AS sm, CAST(d2 AS BIGINT) AS median_d2
-               FROM rk WHERE rnk = 250),
-       agg AS (SELECT s, CAST(count(*) AS BIGINT) AS n_pts,
-                      CAST(sum(d2) AS BIGINT) AS sum_d2,
-                      CAST(max(d2) AS BIGINT) AS max_d2
-               FROM nn GROUP BY s)
-       SELECT agg.s, agg.n_pts, agg.sum_d2, agg.max_d2, med.median_d2,
-              sqrt(CAST(med.median_d2 AS DOUBLE)
-                   / {_Q512_CSR_MED_D2}) AS ce_ratio,
-              CAST(CASE WHEN med.median_d2 < {_Q512_CSR_MED_D2}
-                   THEN 1 ELSE 0 END AS BIGINT) AS clustered
-       FROM agg JOIN med ON med.sm = agg.s"""
-
-
-@query("q512_clark_evans_nn", _q512_sql("//"))
-def q512(spark, sf_dir):
-    """Clark-Evans nearest-neighbor analysis (Clark & Evans 1954) —
-    the oldest point-pattern statistic, here in its exact-integer
-    MEDIAN form: per-point NN squared distances are pure integers
-    (no sqrt until the final display ratio), the median is a rank
-    pick (row 250 of 500 — value-at-rank is tie-order independent),
-    and the verdict compares that integer against the Poisson median
-    threshold ln2/(pi*lambda) Python-inlined as one literal on both
-    engines.  The fixture's q508 regimes carry over: the clustered
-    set (6x6 hot box + hash background, median d2 = 2, 51 co-located
-    pairs) vs the regular stride-4 grid (median exactly 16 — every
-    point's NN is one grid step), flags 1 / 0; a third
-    'random' twin was CUT in design because a linear-congruential
-    lattice is NOT Poisson — its sublattice structure gave median 2,
-    as clustered as the planted set (the degenerate-knob inspection
-    on what was supposed to be the null).  ENGINE: banded NN join
-    (cell = coord div 16, 3x3 neighborhood guarantees Chebyshev-16
-    coverage >= the measured max NN distance sqrt(72)); the oracle
-    replays the quadratic min."""
-    docs = _t(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("q512_documents")
-    sql = _q512_sql("div").replace("FROM documents",
-                                   "FROM q512_documents")
-    # engine path: banded NN instead of the oracle's quadratic join
-    pts = spark.sql(sql[sql.index("WITH pts AS (") + len("WITH pts AS ("):
-                        sql.index("),\n       nn AS")]
-                    ).withColumn("cx", F.expr("x div 16")) \
-                     .withColumn("cy", F.expr("y div 16"))
-    b = pts.select(F.col("s").alias("s2"), F.col("doc_id").alias("doc2"),
-                   F.col("x").alias("x2"), F.col("y").alias("y2"),
-                   F.col("cx").alias("cx2"), F.col("cy").alias("cy2"))
-    nn = (pts.join(b, (F.col("s2") == F.col("s"))
-                   & (F.col("doc2") != F.col("doc_id"))
-                   & (F.abs(F.col("cx2") - F.col("cx")) <= 1)
-                   & (F.abs(F.col("cy2") - F.col("cy")) <= 1))
-          .groupBy("s", "doc_id")
-          .agg(F.min((F.col("x") - F.col("x2")) * (F.col("x") - F.col("x2"))
-                     + (F.col("y") - F.col("y2")) * (F.col("y") - F.col("y2")))
-               .cast("long").alias("d2")))
-    w = Window.partitionBy("s").orderBy("d2")
-    med = (nn.withColumn("rnk", F.row_number().over(w))
-           .filter(F.col("rnk") == 250)
-           .select(F.col("s").alias("sm"),
-                   F.col("d2").cast("long").alias("median_d2")))
-    agg = nn.groupBy("s").agg(
-        F.count("*").cast("long").alias("n_pts"),
-        F.sum("d2").cast("long").alias("sum_d2"),
-        F.max("d2").cast("long").alias("max_d2"))
-    lit = float(_Q512_CSR_MED_D2)
-    return (agg.join(med, agg["s"] == med["sm"])
-            .select("s", "n_pts", "sum_d2", "max_d2", "median_d2",
-                    F.sqrt(F.col("median_d2").cast("double")
-                           / F.lit(lit)).alias("ce_ratio"),
-                    F.when(F.col("median_d2") < F.lit(lit), 1)
-                    .otherwise(0).cast("long").alias("clustered")))
-
-
-_Q513_PTS = """SELECT doc_id, (doc_id*53) % 96 AS x, (doc_id*31) % 84 AS y
-       FROM documents WHERE doc_id < 120"""
-
-
-def _q513_sql() -> str:
-    return f"""WITH pts AS MATERIALIZED ({_Q513_PTS}),
-       pr AS MATERIALIZED (
-         SELECT a.doc_id AS u, b.doc_id AS v,
-                (a.x-b.x)*(a.x-b.x) + (a.y-b.y)*(a.y-b.y) AS dab
-         FROM pts a JOIN pts b ON b.doc_id > a.doc_id),
-       gab AS MATERIALIZED (
-         SELECT u, v, dab FROM pr
-         WHERE NOT EXISTS (
-           SELECT 1 FROM pts c, pts pa, pts pb
-           WHERE pa.doc_id = pr.u AND pb.doc_id = pr.v
-             AND c.doc_id <> pr.u AND c.doc_id <> pr.v
-             AND (pa.x-c.x)*(pa.x-c.x) + (pa.y-c.y)*(pa.y-c.y)
-                 + (pb.x-c.x)*(pb.x-c.x) + (pb.y-c.y)*(pb.y-c.y)
-                 < pr.dab)),
-       rng AS MATERIALIZED (
-         SELECT u, v, dab FROM pr
-         WHERE NOT EXISTS (
-           SELECT 1 FROM pts c, pts pa, pts pb
-           WHERE pa.doc_id = pr.u AND pb.doc_id = pr.v
-             AND c.doc_id <> pr.u AND c.doc_id <> pr.v
-             AND (pa.x-c.x)*(pa.x-c.x) + (pa.y-c.y)*(pa.y-c.y) < pr.dab
-             AND (pb.x-c.x)*(pb.x-c.x) + (pb.y-c.y)*(pb.y-c.y)
-                 < pr.dab)),
-       sub AS (SELECT CAST(count(*) AS BIGINT) AS viol
-               FROM rng WHERE NOT EXISTS (
-                 SELECT 1 FROM gab
-                 WHERE gab.u = rng.u AND gab.v = rng.v))
-       SELECT CAST((SELECT count(*) FROM pts) AS BIGINT) AS n_pts,
-              CAST((SELECT count(*) FROM gab) AS BIGINT)
-                AS gabriel_edges,
-              CAST((SELECT sum(dab) FROM gab) AS BIGINT)
-                AS gabriel_sum_d2,
-              CAST((SELECT count(*) FROM rng) AS BIGINT) AS rng_edges,
-              CAST((SELECT sum(dab) FROM rng) AS BIGINT)
-                AS rng_sum_d2,
-              sub.viol AS subset_violations
-       FROM sub"""
-
-
-@query("q513_proximity_graphs", _q513_sql())
-def q513(spark, sf_dir):
-    """Gabriel graph + relative-neighborhood graph — the
-    parameter-free proximity graphs between the NN graph and the
-    Delaunay triangulation (Gabriel & Sokal 1969; Toussaint 1980):
-    an edge (a,b) is Gabriel iff NO witness c lies strictly inside
-    the diametral circle — by Thales, d2(a,c) + d2(c,b) < d2(a,b),
-    an all-integer OPEN condition (170 witness incidences in this
-    fixture land EXACTLY on the circle and must not block; the <
-    vs <= choice is pinned here) — and RNG iff no c has
-    max(d2(a,c), d2(c,b)) < d2(a,b).  The containment theorem
-    RNG subset-of GG is emitted as a computed proof column
-    (subset_violations == 0, an anti-join, never assumed): a
-    Gabriel witness has angle acb > 90 degrees so both legs are
-    shorter than the chord.  120 distinct lattice points, 295
-    Gabriel / 254 RNG edges; both graphs from one 7140-pair
-    candidate set with a 120-row broadcast witness check — at
-    corpus scale this is the per-tile beta-skeleton primitive (the
-    q226 Delaunay companion)."""
-    docs = _t(spark, sf_dir, "documents")
-    pts = (docs.filter(F.col("doc_id") < 120)
-           .select("doc_id", ((F.col("doc_id") * 53) % 96).alias("x"),
-                   ((F.col("doc_id") * 31) % 84).alias("y"))
-           .localCheckpoint())
-    a = pts.select(F.col("doc_id").alias("u"), F.col("x").alias("ax"),
-                   F.col("y").alias("ay"))
-    bb = pts.select(F.col("doc_id").alias("v"), F.col("x").alias("bx"),
-                    F.col("y").alias("by"))
-    pr = (a.join(bb, F.col("v") > F.col("u"))
-          .withColumn("dab", (F.col("ax") - F.col("bx"))
-                      * (F.col("ax") - F.col("bx"))
-                      + (F.col("ay") - F.col("by"))
-                      * (F.col("ay") - F.col("by")))
-          .localCheckpoint())
-    c = F.broadcast(pts.select(F.col("doc_id").alias("w"),
-                               F.col("x").alias("cx"),
-                               F.col("y").alias("cy")))
-    d2ac = ((F.col("ax") - F.col("cx")) * (F.col("ax") - F.col("cx"))
-            + (F.col("ay") - F.col("cy")) * (F.col("ay") - F.col("cy")))
-    d2cb = ((F.col("bx") - F.col("cx")) * (F.col("bx") - F.col("cx"))
-            + (F.col("by") - F.col("cy")) * (F.col("by") - F.col("cy")))
-    notab = (F.col("w") != F.col("u")) & (F.col("w") != F.col("v"))
-    gab_wit = (pr.join(c, notab & (d2ac + d2cb < F.col("dab")))
-               .select("u", "v").distinct())
-    rng_wit = (pr.join(c, notab & (d2ac < F.col("dab"))
-                       & (d2cb < F.col("dab")))
-               .select("u", "v").distinct())
-    gab = pr.join(gab_wit, ["u", "v"], "left_anti").localCheckpoint()
-    rng = pr.join(rng_wit, ["u", "v"], "left_anti").localCheckpoint()
-    viol = rng.join(gab.select("u", "v"), ["u", "v"], "left_anti").count()
-    n_pts = pts.count()
-    g = gab.agg(F.count("*").alias("ge"), F.sum("dab").alias("gs")) \
-           .collect()[0]
-    r = rng.agg(F.count("*").alias("re"), F.sum("dab").alias("rs")) \
-           .collect()[0]
-    return spark.createDataFrame(
-        [(int(n_pts), int(g["ge"]), int(g["gs"]), int(r["re"]),
-          int(r["rs"]), int(viol))],
-        "n_pts long, gabriel_edges long, gabriel_sum_d2 long, "
-        "rng_edges long, rng_sum_d2 long, subset_violations long")
-
-
-def _q514_sql(divop: str) -> str:
-    return f"""WITH stores AS (
-         SELECT n_nationkey AS store_id,
-                (n_nationkey*37) % 96 AS sx,
-                (n_nationkey*53) % 84 AS sy,
-                CASE WHEN n_nationkey = 0 THEN 100
-                     ELSE 1 + (n_nationkey*7) % 20 END AS attract
-         FROM nation WHERE n_nationkey < 10),
-       cons AS (SELECT doc_id, (doc_id*11) % 96 AS x,
-                       (doc_id*13) % 84 AS y
-                FROM documents),
-       scored AS (SELECT cons.doc_id, stores.store_id,
-                         (x-sx)*(x-sx) + (y-sy)*(y-sy) AS d2,
-                         CAST((x-sx)*(x-sx) + (y-sy)*(y-sy) AS DOUBLE)
-                           / attract AS cost
-                  FROM cons CROSS JOIN stores),
-       pick AS (SELECT doc_id, store_id, d2,
-                       row_number() OVER (PARTITION BY doc_id
-                         ORDER BY cost, store_id) AS rnk
-                FROM scored),
-       assigned AS (SELECT store_id, CAST(count(*) AS BIGINT)
-                      AS n_assigned,
-                           CAST(sum(d2) AS BIGINT) AS sum_d2
-                    FROM pick WHERE rnk = 1 GROUP BY store_id)
-       SELECT stores.store_id, stores.attract,
-              coalesce(assigned.n_assigned, 0) AS n_assigned,
-              coalesce(assigned.sum_d2, 0) AS sum_d2,
-              CAST(coalesce(assigned.n_assigned, 0) AS DOUBLE)
-                / 500.0 AS share
-       FROM stores LEFT JOIN assigned
-         ON assigned.store_id = stores.store_id"""
-
-
-@query("q514_huff_market_areas", _q514_sql("//"))
-def q514(spark, sf_dir):
-    """Huff-model market areas = multiplicatively weighted Voronoi
-    (Huff 1964; the retail-gravity assignment behind trade-area GIS):
-    each consumer chooses the store minimizing d2/attractiveness —
-    the deterministic argmax of the Huff utility A/d^2.  The sort
-    key d2/A is ONE IEEE division of exact integers, identical bits
-    on both engines, with ties broken by store id (pinned); no
-    probability normalization is ever computed, because the CHOICE
-    map needs only the order — the q-argmin lesson (a float sum
-    across stores would be order-sensitive; a single division per
-    pair is not).  Store 0 is planted with attractiveness 100
-    against 1..20 for the rest: its weighted cell swallows ~40% of
-    the 500-consumer field including territory geometrically closer
-    to rivals, while plain Voronoi would cap it near 1/10 — the
-    weighting IS the story.  The store universe survives zero
-    assignment via the generated-universe LEFT JOIN.  ENGINE:
-    per-consumer argmin as a map-side-combinable F.min(struct(cost,
-    store_id, d2)) over the broadcast 10-store dim — never a window
-    sort over consumers x stores."""
-    stores = (_t(spark, sf_dir, "nation")
-              .filter(F.col("n_nationkey") < 10)
-              .select(F.col("n_nationkey").alias("store_id"),
-                      ((F.col("n_nationkey") * 37) % 96).alias("sx"),
-                      ((F.col("n_nationkey") * 53) % 84).alias("sy"),
-                      F.when(F.col("n_nationkey") == 0, 100)
-                      .otherwise(1 + (F.col("n_nationkey") * 7) % 20)
-                      .alias("attract")))
-    cons = (_t(spark, sf_dir, "documents")
-            .select("doc_id", ((F.col("doc_id") * 11) % 96).alias("x"),
-                    ((F.col("doc_id") * 13) % 84).alias("y")))
-    d2 = ((F.col("x") - F.col("sx")) * (F.col("x") - F.col("sx"))
-          + (F.col("y") - F.col("sy")) * (F.col("y") - F.col("sy")))
-    scored = cons.crossJoin(F.broadcast(stores)).select(
-        "doc_id", "store_id", d2.alias("d2"),
-        (d2.cast("double") / F.col("attract")).alias("cost"))
-    pick = (scored.groupBy("doc_id")
-            .agg(F.min(F.struct("cost", "store_id", "d2")).alias("m"))
-            .select(F.col("m.store_id").alias("store_id"),
-                    F.col("m.d2").alias("d2")))
-    assigned = pick.groupBy("store_id").agg(
-        F.count("*").cast("long").alias("n_assigned"),
-        F.sum("d2").cast("long").alias("sum_d2"))
-    return (stores.join(assigned, "store_id", "left")
-            .select("store_id", "attract",
-                    F.coalesce("n_assigned", F.lit(0)).cast("long")
-                    .alias("n_assigned"),
-                    F.coalesce("sum_d2", F.lit(0)).cast("long")
-                    .alias("sum_d2"),
-                    (F.coalesce("n_assigned", F.lit(0)).cast("double")
-                     / 500.0).alias("share")))
-
-
-# --- Change detection + compositing + cost distance (q515-q517) ------------------------
-
-
-def _q515_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH px AS (SELECT doc_id,
-                      doc_id % 25 AS gx, doc_id {divop} 25 AS gy,
-                      50 + (doc_id*7) % 40 AS b1_0,
-                      60 + (doc_id*11) % 40 AS b2_0
-               FROM {tbl}),
-       ep1 AS (SELECT doc_id, gx, gy, b1_0, b2_0,
-                      CASE WHEN gx BETWEEN 8 AND 14
-                            AND gy BETWEEN 6 AND 12
-                           THEN b1_0 + 30
-                           WHEN gx BETWEEN 18 AND 22
-                            AND gy BETWEEN 2 AND 5
-                           THEN b1_0 - 20
-                           ELSE b1_0 END AS b1_1,
-                      CASE WHEN gx BETWEEN 8 AND 14
-                            AND gy BETWEEN 6 AND 12
-                           THEN b2_0 - 25
-                           WHEN gx BETWEEN 18 AND 22
-                            AND gy BETWEEN 2 AND 5
-                           THEN b2_0 - 35
-                           ELSE b2_0 END AS b2_1
-               FROM px),
-       cv AS (SELECT gx, gy, b1_1 - b1_0 AS d1, b2_1 - b2_0 AS d2,
-                     (b1_1-b1_0)*(b1_1-b1_0)
-                       + (b2_1-b2_0)*(b2_1-b2_0) AS mag2
-              FROM ep1),
-       oct AS (SELECT gx, gy, mag2,
-                      CASE WHEN mag2 = 0 THEN -1
-                           WHEN d1 > 0 AND d2 >= 0 AND d1 > d2 THEN 0
-                           WHEN d1 <= 0 AND d2 > 0 AND d2 >= -d1
-                                THEN CASE WHEN d1 = 0 OR d2 > -d1
-                                     THEN 2 ELSE 3 END
-                           WHEN d1 > 0 AND d2 > 0 THEN 1
-                           WHEN d1 < 0 AND d2 <= 0 AND -d1 >= -d2
-                                THEN 4
-                           WHEN d1 <= 0 AND d2 < 0 AND -d2 > -d1
-                                THEN CASE WHEN d1 = 0 THEN 6
-                                     ELSE 5 END
-                           WHEN d1 > 0 AND d2 < 0 AND -d2 > d1 THEN 6
-                           ELSE 7 END AS octant,
-                      CASE WHEN mag2 > 225 THEN 1 ELSE 0 END AS changed
-               FROM cv)
-       SELECT CAST(octant AS BIGINT) AS octant,
-              CAST(changed AS BIGINT) AS changed,
-              CAST(count(*) AS BIGINT) AS n_pixels,
-              CAST(sum(mag2) AS BIGINT) AS sum_mag2,
-              CAST(max(mag2) AS BIGINT) AS max_mag2
-       FROM oct GROUP BY octant, changed"""
-
-
-@query("q515_change_vector_analysis", _q515_sql("//"))
-def q515(spark, sf_dir):
-    """Change-vector analysis — the two-date multispectral change
-    detector (Malila 1980; the change half of gdal_calc workflows):
-    per pixel the band-space displacement (d1, d2) between epochs,
-    its squared magnitude as an exact integer, its DIRECTION as an
-    exact integer octant (the q74 rule: sign tests + |d1| vs |d2|
-    cross-comparisons, never an atan2), and a change mask from the
-    integer threshold mag2 > 15^2.  Direction is what separates
-    change TYPES: the planted 7x7 'vegetation loss' box moves
-    (+30, -25) into octant 7 (red up, nir down) while the 5x4
-    'water gain' box moves (-20, -35) into octant 5 — same
-    magnitude scale, opposite quadrants — and the untouched
-    background collapses into the zero-vector class (octant -1,
-    mag2 = 0), so the output is one compact (octant, changed)
-    histogram with per-class magnitude sums.  One pass, no joins;
-    at raster scale this is a pure per-tile Column expression."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q515_documents")
-    return spark.sql(_q515_sql("div", "q515_documents"))
-
-
-def _q516_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH eps AS (SELECT 0 AS t UNION ALL SELECT 1
-               UNION ALL SELECT 2 UNION ALL SELECT 3
-               UNION ALL SELECT 4 UNION ALL SELECT 5),
-       obs AS (SELECT doc_id, t,
-                      CASE WHEN (doc_id*31 + t) % 3 = 0 THEN 1
-                           ELSE 0 END AS cloudy,
-                      40 + (doc_id*13 + t*17) % 30
-                        + CASE WHEN (doc_id*31 + t) % 3 = 0
-                          THEN 60 ELSE 0 END AS red,
-                      80 + (doc_id*19 + t*23) % 40
-                        - CASE WHEN (doc_id*31 + t) % 3 = 0
-                          THEN 30 ELSE 0 END AS nir
-               FROM {tbl} CROSS JOIN eps),
-       nd AS (SELECT doc_id, t, cloudy, red, nir,
-                     CAST(nir - red AS DOUBLE)
-                       / CAST(nir + red AS DOUBLE) AS ndvi
-              FROM obs),
-       best AS (SELECT doc_id,
-                       CAST(max(ndvi) AS DOUBLE) AS best_ndvi
-                FROM nd GROUP BY doc_id),
-       pick AS (SELECT nd.doc_id,
-                       CAST(min(nd.t) AS BIGINT) AS t,
-                       CAST(min(nd.t * 1000 + nd.cloudy) % 1000
-                            AS BIGINT) AS chose_cloudy
-                FROM nd JOIN best ON best.doc_id = nd.doc_id
-                 AND nd.ndvi = best.best_ndvi
-                GROUP BY nd.doc_id),
-       comp AS (SELECT pick.doc_id, pick.t, pick.chose_cloudy,
-                       nd.red, nd.nir, nd.ndvi
-                FROM pick JOIN nd ON nd.doc_id = pick.doc_id
-                 AND nd.t = pick.t)
-       SELECT t AS chosen_epoch,
-              CAST(count(*) AS BIGINT) AS n_pixels,
-              CAST(sum(red) AS BIGINT) AS sum_red,
-              CAST(sum(nir) AS BIGINT) AS sum_nir,
-              CAST(sum(chose_cloudy) AS BIGINT) AS n_cloudy_chosen
-       FROM comp GROUP BY t"""
-
-
-@query("q516_max_ndvi_composite", _q516_sql("//"))
-def q516(spark, sf_dir):
-    """Max-NDVI compositing — the cloud-screening temporal reducer
-    behind every AVHRR/MODIS mosaic (Holben 1986): per pixel, keep
-    the epoch maximizing NDVI = (nir-red)/(nir+red), because clouds
-    depress NDVI.  Each NDVI is ONE IEEE division of exact integers
-    (bit-identical across engines); the argmax is the struct-max
-    pattern with ties broken to the EARLIEST epoch, mirrored in SQL
-    as the two-phase max-then-min-at-max per the q334 struct-extract
-    lesson.  The cloud model guarantees its own audit: every pixel
-    gets exactly 2 cloudy epochs out of 6 ((31d + t) mod 3 — never
-    all-cloudy), and a cloudy observation's NDVI is provably
-    negative (nir' - red' <= 120 - 40 - 90 < 0) while clear ones
-    are provably positive, so n_cloudy_chosen == 0 is a THEOREM the
-    output re-derives per epoch as a data column.  The per-epoch
-    histogram shows the composite drawing from all six epochs.
-    ENGINE: one map-side-combinable max(struct(ndvi, 5-t, cloudy,
-    red, nir)) per pixel — never a window sort over pixels x
-    epochs."""
-    docs = _t(spark, sf_dir, "documents")
-    eps = spark.range(6).select(F.col("id").cast("int").alias("t"))
-    cloudy = F.when((F.col("doc_id") * 31 + F.col("t")) % 3 == 0, 1) \
-              .otherwise(0)
-    obs = docs.crossJoin(F.broadcast(eps)).select(
-        "doc_id", "t", cloudy.alias("cloudy"),
-        (40 + (F.col("doc_id") * 13 + F.col("t") * 17) % 30
-         + cloudy * 60).alias("red"),
-        (80 + (F.col("doc_id") * 19 + F.col("t") * 23) % 40
-         - cloudy * 30).alias("nir"))
-    nd = obs.withColumn(
-        "ndvi", (F.col("nir") - F.col("red")).cast("double")
-        / (F.col("nir") + F.col("red")).cast("double"))
-    comp = (nd.groupBy("doc_id")
-            .agg(F.max(F.struct(F.col("ndvi"),
-                                (F.lit(5) - F.col("t")).alias("tinv"),
-                                F.col("cloudy"), F.col("red"),
-                                F.col("nir"))).alias("m")))
-    return (comp.select((F.lit(5) - F.col("m.tinv")).alias("chosen_epoch"),
-                        F.col("m.cloudy").alias("cloudy"),
-                        F.col("m.red").alias("red"),
-                        F.col("m.nir").alias("nir"))
-            .groupBy("chosen_epoch")
-            .agg(F.count("*").cast("long").alias("n_pixels"),
-                 F.sum("red").cast("long").alias("sum_red"),
-                 F.sum("nir").cast("long").alias("sum_nir"),
-                 F.sum("cloudy").cast("long").alias("n_cloudy_chosen"))
-            .select(F.col("chosen_epoch").cast("long"), "n_pixels",
-                    "sum_red", "sum_nir", "n_cloudy_chosen"))
-
-
-def _q517_oracle() -> str:
-    rounds = []
-    for r in range(1, 11):
-        rounds.append(f"""d{r} AS MATERIALIZED (
-         SELECT g.gx, g.gy, g.w,
-                least(p.k,
-                      coalesce(min((n.k // 4096 + g.w) * 4096
-                                   + n.k % 4096), p.k)) AS k
-         FROM grid g
-         JOIN d{r-1} p ON p.gx = g.gx AND p.gy = g.gy
-         LEFT JOIN d{r-1} n
-           ON abs(n.gx - g.gx) + abs(n.gy - g.gy) = 1
-          AND n.k < 99999999
-         GROUP BY g.gx, g.gy, g.w, p.k)""")
-    chain = ",\n       ".join(rounds)
-    return f"""WITH cells AS (SELECT DISTINCT doc_id % 144 AS c
-               FROM documents),
-       grid AS MATERIALIZED (
-         SELECT c % 12 AS gx, c // 12 AS gy,
-                1 + ((c % 12)*7 + (c // 12)*11) % 5 AS w
-         FROM cells),
-       d0 AS MATERIALIZED (
-         SELECT gx, gy, w,
-                CASE WHEN gx = 1 AND gy = 1 THEN 0
-                     WHEN gx = 10 AND gy = 6 THEN 1
-                     WHEN gx = 4 AND gy = 10 THEN 2
-                     ELSE 99999999 END AS k
-         FROM grid),
-       {chain},
-       res AS (SELECT CAST(count(*) AS BIGINT) AS improvable
-               FROM (SELECT g.gx, g.gy,
-                            least(p.k,
-                                  coalesce(min((n.k // 4096 + g.w)
-                                               * 4096 + n.k % 4096),
-                                           p.k)) AS k11, p.k
-                     FROM grid g
-                     JOIN d10 p ON p.gx = g.gx AND p.gy = g.gy
-                     LEFT JOIN d10 n
-                       ON abs(n.gx - g.gx) + abs(n.gy - g.gy) = 1
-                      AND n.k < 99999999
-                     GROUP BY g.gx, g.gy, g.w, p.k) x
-               WHERE x.k11 <> x.k)
-       SELECT CAST(d10.k % 4096 AS BIGINT) AS alloc_src,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(sum(d10.k // 4096) AS BIGINT) AS sum_cost,
-              CAST(max(d10.k // 4096) AS BIGINT) AS max_cost,
-              res.improvable AS conv_resid
-       FROM d10 CROSS JOIN res
-       GROUP BY d10.k % 4096, res.improvable"""
-
-
-@query("q517_cost_distance", _q517_oracle())
-def q517(spark, sf_dir):
-    """Cost distance + allocation (GRASS r.cost / r.walk family —
-    the weighted generalization of the q45/q69 proximity EDT): from
-    3 seed cells over a 12x12 friction surface (entering cell c
-    costs w(c) = 1 + (7gx + 11gy) % 5; seeds cost 0 — the entry-
-    cost convention is PINNED, GRASS's half-sum variant differs),
-    compute the least accumulated cost and the seed that attains it
-    with ties to the SMALLEST seed id.  The spec is re-pinned
-    round-synchronous Jacobi relaxation (the sieve lesson: pin the
-    order-free spec FIRST, then both paths implement it): each
-    round relaxes every cell from its rook neighbors
-    simultaneously, and (cost, seed) rides ONE packed BIGINT key
-    cost*4096 + src so lexicographic min IS the tie rule — no
-    two-phase struct extraction anywhere (the q334 trap avoided by
-    encoding, the q475/q478 recurrence family's grid sibling).  The
-    fixture converges in 9 rounds (checked in design; max cost 20);
-    10 unrolled MATERIALIZED oracle rounds + an 11th-round
-    improvable-count emitted as conv_resid == 0 on every row, the
-    engine running the same 10 rounds as DataFrame iterations with
-    localCheckpoint lineage truncation.  Output: per-seed
-    allocation sizes (42/54/48) + cost sums — the weighted Voronoi
-    of the friction surface."""
-    cells = (_t(spark, sf_dir, "documents")
-             .select((F.col("doc_id") % 144).alias("c")).distinct())
-    grid = cells.select(
-        (F.col("c") % 12).alias("gx"),
-        F.expr("c div 12").alias("gy"),
-        (1 + ((F.col("c") % 12) * 7 + F.expr("c div 12") * 11) % 5)
-        .alias("w")).localCheckpoint()
-    INF = 99999999
-    d = grid.select(
-        "gx", "gy", "w",
-        F.when((F.col("gx") == 1) & (F.col("gy") == 1), 0)
-        .when((F.col("gx") == 10) & (F.col("gy") == 6), 1)
-        .when((F.col("gx") == 4) & (F.col("gy") == 10), 2)
-        .otherwise(INF).cast("long").alias("k")).localCheckpoint()
-
-    def relax(cur):
-        n = cur.filter(F.col("k") < INF).select(
-            F.col("gx").alias("nx"), F.col("gy").alias("ny"),
-            F.col("k").alias("nk"))
-        return (cur.join(n, (F.abs(F.col("nx") - F.col("gx"))
-                             + F.abs(F.col("ny") - F.col("gy"))) == 1,
-                         "left")
-                .groupBy("gx", "gy", "w", "k")
-                .agg(F.min(F.expr("(nk div 4096 + w) * 4096"
-                                  " + nk % 4096")).alias("nbr"))
-                .select("gx", "gy", "w",
-                        F.least(F.col("k"),
-                                F.coalesce("nbr", F.col("k")))
-                        .alias("k")))
-
-    for r in range(10):
-        d = relax(d)
-        if r % 3 == 2:
-            d = d.localCheckpoint()
-    d = d.localCheckpoint()
-    improvable = (relax(d).withColumnRenamed("k", "k11")
-                  .join(d.select("gx", "gy", F.col("k").alias("k10")),
-                        ["gx", "gy"])
-                  .filter(F.col("k11") != F.col("k10")).count())
-    return (d.groupBy((F.col("k") % 4096).cast("long").alias("alloc_src"))
-            .agg(F.count("*").cast("long").alias("n_cells"),
-                 F.sum(F.expr("k div 4096")).cast("long").alias("sum_cost"),
-                 F.max(F.expr("k div 4096")).cast("long").alias("max_cost"))
-            .withColumn("conv_resid",
-                        F.lit(improvable).cast("long")))
-
-
-# --- Areal interpolation + D8 flow accumulation (q518-q519) ----------------------------
-
-
-def _q518_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH pts AS (SELECT doc_id,
-                      CASE WHEN doc_id % 10 = 7
-                           THEN 48 + (doc_id {divop} 10) % 6
-                           ELSE (doc_id*41) % 96 END AS x,
-                      CASE WHEN doc_id % 10 = 7
-                           THEN 36 + ((doc_id {divop} 10) * 3) % 6
-                           ELSE (doc_id*67) % 84 END AS y
-               FROM {tbl}),
-       src AS (SELECT x {divop} 24 AS sx, y {divop} 21 AS sy,
-                      CAST(count(*) AS BIGINT) AS cnt
-               FROM pts GROUP BY x {divop} 24, y {divop} 21),
-       tgt_true AS (SELECT x {divop} 32 AS tx, y {divop} 21 AS ty,
-                           CAST(count(*) AS BIGINT) AS truth
-                    FROM pts GROUP BY x {divop} 32, y {divop} 21),
-       d4 AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2
-              UNION ALL SELECT 3),
-       suni AS (SELECT a.i AS sx, b.i AS sy FROM d4 a JOIN d4 b ON 1=1),
-       tuni AS (SELECT a.i AS tx, b.i AS ty FROM d4 a JOIN d4 b
-                ON b.i < 4 WHERE a.i < 3),
-       ov AS (SELECT s.sx, s.sy, t.tx, t.ty,
-                     (least((s.sx+1)*24, (t.tx+1)*32)
-                      - greatest(s.sx*24, t.tx*32))
-                     * CASE WHEN s.sy = t.ty THEN 21 ELSE 0 END AS a_ov
-              FROM suni s JOIN tuni t
-                ON least((s.sx+1)*24, (t.tx+1)*32)
-                   > greatest(s.sx*24, t.tx*32)
-               AND s.sy = t.ty),
-       est AS (SELECT ov.tx, ov.ty,
-                      CAST(sum(coalesce(src.cnt, 0) * ov.a_ov)
-                           AS BIGINT) AS est_num
-               FROM ov LEFT JOIN src
-                 ON src.sx = ov.sx AND src.sy = ov.sy
-               GROUP BY ov.tx, ov.ty),
-       tot AS (SELECT CAST(sum(est_num) AS BIGINT) AS sum_num
-               FROM est),
-       n AS (SELECT CAST(count(*) AS BIGINT) AS n_pts FROM pts)
-       SELECT est.tx, est.ty, est.est_num,
-              CAST(est.est_num AS DOUBLE) / 504.0 AS estimate,
-              coalesce(tgt_true.truth, 0) AS truth,
-              CAST(est.est_num - 504 * coalesce(tgt_true.truth, 0)
-                   AS BIGINT) AS err_num,
-              CAST(tot.sum_num - 504 * n.n_pts AS BIGINT)
-                AS conserve_resid
-       FROM est LEFT JOIN tgt_true
-         ON tgt_true.tx = est.tx AND tgt_true.ty = est.ty
-       CROSS JOIN tot CROSS JOIN n"""
-
-
-@query("q518_areal_interpolation", _q518_sql("//"))
-def q518(spark, sf_dir):
-    """Areal interpolation — re-apportioning counts between
-    INCOMPATIBLE zone systems (Goodchild & Lam 1980; what every
-    census-to-watershed or admin-to-tile reaggregation does): source
-    zones are the 4x4 grid of 24x21 rectangles, targets the 3x4 grid
-    of 32x21 — two exact partitions of the same 96x84 arena — and
-    the area-weighted estimate is est_t = sum_s cnt_s * ov(s,t) /
-    A_s.  Equal source areas (A_s = 504) keep the numerator an
-    exact BIGINT with ONE final division, and the pycnophylactic
-    property becomes a computable identity: sum_t est_num = 504 *
-    total points, emitted as conserve_resid == 0 (mass is
-    reapportioned, never created).  Axis-aligned overlap areas are
-    exact integer least/greatest arithmetic.  The planted 6x6 hot
-    box makes the METHOD's bias visible: uniform-density weighting
-    smears source zone (2,1)'s box mass 2:1 across two targets while
-    the truth puts it wholly in one, so err_num swings hundreds of
-    units on exactly those two rows and stays near zero elsewhere —
-    the estimate-vs-truth audit rides in the output.  Two groupBys
-    + a broadcast 12x16 zone-overlap join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q518_documents")
-    return spark.sql(_q518_sql("div", "q518_documents"))
-
-
-def _q519_oracle() -> str:
-    rounds = []
-    for r in range(1, 10):
-        rounds.append(f"""a{r} AS MATERIALIZED (
-         SELECT g.c, 1 + coalesce(sum(p.acc), 0) AS acc
-         FROM grid g
-         LEFT JOIN flow ON flow.tc = g.c
-         LEFT JOIN a{r-1} p ON p.c = flow.c
-         GROUP BY g.c)""")
-    chain = ",\n       ".join(rounds)
-    return f"""WITH cells AS (SELECT DISTINCT doc_id % 256 AS c
-               FROM documents),
-       grid AS MATERIALIZED (
-         SELECT c, c % 16 AS gx, c // 16 AS gy,
-                (c % 16 - 8)*(c % 16 - 8)
-                  + (c // 16 - 8)*(c // 16 - 8) AS dem
-         FROM cells),
-       offs AS (SELECT -1 AS dx, -1 AS dy, 0 AS k UNION ALL
-                SELECT -1, 0, 1 UNION ALL SELECT -1, 1, 2 UNION ALL
-                SELECT 0, -1, 3 UNION ALL SELECT 0, 1, 4 UNION ALL
-                SELECT 1, -1, 5 UNION ALL SELECT 1, 0, 6 UNION ALL
-                SELECT 1, 1, 7),
-       pick AS MATERIALIZED (
-         SELECT g.c, g.gx, g.gy,
-                min(n.dem * 8 + offs.k) % 8 AS kk
-         FROM grid g
-         JOIN offs ON g.gx + offs.dx BETWEEN 0 AND 15
-                  AND g.gy + offs.dy BETWEEN 0 AND 15
-         JOIN grid n ON n.gx = g.gx + offs.dx
-                    AND n.gy = g.gy + offs.dy
-         WHERE n.dem < g.dem
-         GROUP BY g.c, g.gx, g.gy),
-       flow AS MATERIALIZED (
-         SELECT pick.c,
-                (pick.gx + offs.dx) + 16*(pick.gy + offs.dy) AS tc
-         FROM pick JOIN offs ON offs.k = pick.kk),
-       a0 AS MATERIALIZED (SELECT c, 1 AS acc FROM grid),
-       {chain},
-       res AS (SELECT CAST(count(*) AS BIGINT) AS changed
-               FROM (SELECT g.c,
-                            1 + coalesce(sum(p.acc), 0) AS acc10
-                     FROM grid g
-                     LEFT JOIN flow ON flow.tc = g.c
-                     LEFT JOIN a9 p ON p.c = flow.c
-                     GROUP BY g.c) x
-               JOIN a9 ON a9.c = x.c WHERE a9.acc <> x.acc10),
-       sink AS (SELECT CAST(a9.acc AS BIGINT) AS sink_acc
-                FROM a9 WHERE a9.c NOT IN (SELECT c FROM flow))
-       SELECT CAST(a9.acc AS BIGINT) AS acc,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              sink.sink_acc, res.changed AS conv_resid
-       FROM a9 CROSS JOIN sink CROSS JOIN res
-       GROUP BY a9.acc, sink.sink_acc, res.changed"""
-
-
-
-@query("q519_d8_flow_accumulation", _q519_oracle())
-def q519(spark, sf_dir):
-    """D8 flow accumulation — the upstream-area raster behind every
-    stream-extraction workflow (O'Callaghan & Mark 1984; completes
-    q466's D8 directions with the count those directions exist to
-    feed): every cell drains to its steepest-descent 8-neighbor on
-    a cone DEM (squared distance to center — exact integers; ties
-    broken by the PINNED neighbor-scan order, encoded as one packed
-    min(dem*8 + k)), and accumulation counts the cells draining
-    through, computed as the round-synchronous recurrence acc_r = 1
-    + sum of upstream acc_{r-1}.  On the cone the flow graph is a
-    single tree: max path length 8 (checked in design), 9 unrolled
-    MATERIALIZED oracle rounds + a 10th-round change count as
-    conv_resid == 0, and conservation is the sink row — the center
-    cell's accumulation EQUALS the 256-cell total, emitted as
-    sink_acc on every row.  Output is the accumulation histogram
-    (the cone's ring structure: 60 cells at 1, four spokes at
-    9/16/25/36).  ENGINE: flow edges from one 8-offset broadcast
-    join, then the same 9 Jacobi rounds as DataFrame iterations
-    with localCheckpoint truncation — the q517 grid-recurrence
-    shape on a functional graph."""
-    cells = (_t(spark, sf_dir, "documents")
-             .select((F.col("doc_id") % 256).alias("c")).distinct())
-    grid = cells.select(
-        "c", (F.col("c") % 16).alias("gx"),
-        F.expr("c div 16").alias("gy")).withColumn(
-        "dem", (F.col("gx") - 8) * (F.col("gx") - 8)
-        + (F.col("gy") - 8) * (F.col("gy") - 8)).localCheckpoint()
-    offs = spark.createDataFrame(
-        [(-1, -1, 0), (-1, 0, 1), (-1, 1, 2), (0, -1, 3),
-         (0, 1, 4), (1, -1, 5), (1, 0, 6), (1, 1, 7)],
-        "dx int, dy int, k int")
-    n = grid.select(F.col("gx").alias("nx"), F.col("gy").alias("ny"),
-                    F.col("dem").alias("ndem"))
-    flow = (grid.crossJoin(F.broadcast(offs))
-            .join(n, (F.col("nx") == F.col("gx") + F.col("dx"))
-                  & (F.col("ny") == F.col("gy") + F.col("dy")))
-            .filter(F.col("ndem") < F.col("dem"))
-            .groupBy("c", "gx", "gy")
-            .agg(F.min(F.col("ndem") * 8 + F.col("k")).alias("packed"))
-            .withColumn("kk", F.col("packed") % 8))
-    flow = (flow.join(F.broadcast(offs), flow["kk"] == offs["k"])
-            .select("c", ((F.col("gx") + F.col("dx"))
-                          + 16 * (F.col("gy") + F.col("dy")))
-                    .alias("tc"))
-            .localCheckpoint())
-    acc = grid.select("c", F.lit(1).cast("long").alias("acc"))
-
-    def step(cur):
-        up = (flow.join(cur.withColumnRenamed("c", "uc"),
-                        flow["c"] == F.col("uc"))
-              .groupBy("tc").agg(F.sum("acc").alias("up_acc")))
-        return (grid.select("c")
-                .join(up, grid["c"] == up["tc"], "left")
-                .select("c", (1 + F.coalesce("up_acc", F.lit(0)))
-                        .cast("long").alias("acc")))
-
-    for r in range(9):
-        acc = step(acc)
-        if r % 3 == 2:
-            acc = acc.localCheckpoint()
-    acc = acc.localCheckpoint()
-    changed = (step(acc).withColumnRenamed("acc", "acc10")
-               .join(acc, "c")
-               .filter(F.col("acc10") != F.col("acc")).count())
-    sink_acc = (acc.join(flow.select("c"), "c", "left_anti")
-                .collect()[0]["acc"])
-    return (acc.groupBy("acc")
-            .agg(F.count("*").cast("long").alias("n_cells"))
-            .select(F.col("acc").cast("long"), "n_cells",
-                    F.lit(sink_acc).cast("long").alias("sink_acc"),
-                    F.lit(changed).cast("long").alias("conv_resid")))
-
-
-# --- Strahler stream order + watershed basins (q520-q521) ------------------------------
-
-
-def _q520_sql(divop: str, mat: str, tbl: str = "documents") -> str:
-    rounds = []
-    for r in range(1, 6):
-        rounds.append(f"""b{r} AS{mat} (
-         SELECT flow.tc AS tc, p.o AS o,
-                CAST(count(*) AS BIGINT) AS n
-         FROM flow JOIN o{r-1} p ON p.c = flow.c
-         GROUP BY flow.tc, p.o),
-       o{r} AS{mat} (
-         SELECT g.c,
-                coalesce(max(b{r}.o * 2
-                             + CASE WHEN b{r}.n >= 2 THEN 1 ELSE 0 END)
-                         {divop} 2
-                         + max(b{r}.o * 2
-                               + CASE WHEN b{r}.n >= 2 THEN 1 ELSE 0
-                                 END) % 2,
-                         1) AS o
-         FROM grid g LEFT JOIN b{r} ON b{r}.tc = g.c
-         GROUP BY g.c)""")
-    chain = ",\n       ".join(rounds)
-    return f"""WITH cells AS (SELECT DISTINCT doc_id % 256 AS c
-               FROM {tbl}),
-       grid AS{mat} (
-         SELECT c, c % 16 AS gx, c {divop} 16 AS gy,
-                (c % 16 - 8)*(c % 16 - 8)
-                  + (c {divop} 16 - 8)*(c {divop} 16 - 8) AS dem
-         FROM cells),
-       offs AS (SELECT -1 AS dx, -1 AS dy, 0 AS k UNION ALL
-                SELECT -1, 0, 1 UNION ALL SELECT -1, 1, 2 UNION ALL
-                SELECT 0, -1, 3 UNION ALL SELECT 0, 1, 4 UNION ALL
-                SELECT 1, -1, 5 UNION ALL SELECT 1, 0, 6 UNION ALL
-                SELECT 1, 1, 7),
-       pick AS{mat} (
-         SELECT g.c, g.gx, g.gy,
-                min(n.dem * 8 + offs.k) % 8 AS kk
-         FROM grid g
-         JOIN offs ON g.gx + offs.dx BETWEEN 0 AND 15
-                  AND g.gy + offs.dy BETWEEN 0 AND 15
-         JOIN grid n ON n.gx = g.gx + offs.dx
-                    AND n.gy = g.gy + offs.dy
-         WHERE n.dem < g.dem
-         GROUP BY g.c, g.gx, g.gy),
-       flow AS{mat} (
-         SELECT pick.c,
-                (pick.gx + offs.dx) + 16*(pick.gy + offs.dy) AS tc
-         FROM pick JOIN offs ON offs.k = pick.kk),
-       o0 AS{mat} (SELECT c, 1 AS o FROM grid),
-       {chain},
-       res AS (SELECT CAST(count(*) AS BIGINT) AS changed
-               FROM o5 JOIN o4 ON o4.c = o5.c
-               WHERE o4.o <> o5.o)
-       SELECT CAST(o5.o AS BIGINT) AS strahler,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              res.changed AS conv_resid
-       FROM o5 CROSS JOIN res
-       GROUP BY o5.o, res.changed"""
-
-
-@query("q520_strahler_order", _q520_sql("//", " MATERIALIZED"))
-def q520(spark, sf_dir):
-    """Strahler stream order (Strahler 1957) — the stream-hierarchy
-    classification every hydrology toolbox derives after flow
-    accumulation (q519's tree, reused verbatim): a leaf is order 1,
-    a confluence takes the max child order, +1 only when TWO OR MORE
-    children share that max.  The round-synchronous recurrence needs
-    the (max child order, count at max) pair per cell per round —
-    extracted in ONE aggregation by the packed-key trick max(o*2 +
-    [n>=2]) over the per-(cell, order) count table (the q517 packing
-    rule: encode the tie logic INTO the key instead of a two-phase
-    struct extraction; counts per distinct order are unique so the
-    flag rides safely in the low bit).  Orders saturate fast — the
-    cone's tree reaches its fixpoint (229 order-1 / 26 order-2 / 1
-    order-3) in 3 rounds; 5 unrolled rounds + the o4-vs-o5 change
-    count as conv_resid == 0.  ONE shared SQL text serves both
-    engines (divop + MATERIALIZED parametrized — Spark gets plain
-    CTEs; the chain is linear so per-reference inlining stays
-    linear, the q414 engine-side corollary)."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q520_documents")
-    return spark.sql(_q520_sql("div", "", "q520_documents"))
-
-
-def _q521_sql(divop: str, mat: str, tbl: str = "documents") -> str:
-    return f"""WITH cells AS (SELECT DISTINCT doc_id % 256 AS c
-               FROM {tbl}),
-       grid AS{mat} (
-         SELECT c, c % 16 AS gx, c {divop} 16 AS gy,
-                least((c % 16 - 4)*(c % 16 - 4)
-                        + (c {divop} 16 - 4)*(c {divop} 16 - 4),
-                      (c % 16 - 11)*(c % 16 - 11)
-                        + (c {divop} 16 - 10)*(c {divop} 16 - 10)
-                        + 3) AS dem
-         FROM cells),
-       offs AS (SELECT -1 AS dx, -1 AS dy, 0 AS k UNION ALL
-                SELECT -1, 0, 1 UNION ALL SELECT -1, 1, 2 UNION ALL
-                SELECT 0, -1, 3 UNION ALL SELECT 0, 1, 4 UNION ALL
-                SELECT 1, -1, 5 UNION ALL SELECT 1, 0, 6 UNION ALL
-                SELECT 1, 1, 7),
-       pick AS{mat} (
-         SELECT g.c, g.gx, g.gy,
-                min(n.dem * 8 + offs.k) % 8 AS kk
-         FROM grid g
-         JOIN offs ON g.gx + offs.dx BETWEEN 0 AND 15
-                  AND g.gy + offs.dy BETWEEN 0 AND 15
-         JOIN grid n ON n.gx = g.gx + offs.dx
-                    AND n.gy = g.gy + offs.dy
-         WHERE n.dem < g.dem
-         GROUP BY g.c, g.gx, g.gy),
-       f1 AS{mat} (
-         SELECT pick.c,
-                (pick.gx + offs.dx) + 16*(pick.gy + offs.dy) AS t
-         FROM pick JOIN offs ON offs.k = pick.kk
-         UNION ALL
-         SELECT g.c, g.c AS t FROM grid g
-         WHERE g.c NOT IN (SELECT c FROM pick)),
-       f2 AS{mat} (SELECT a.c, b.t FROM f1 a JOIN f1 b ON b.c = a.t),
-       f4 AS{mat} (SELECT a.c, b.t FROM f2 a JOIN f2 b ON b.c = a.t),
-       f8 AS{mat} (SELECT a.c, b.t FROM f4 a JOIN f4 b ON b.c = a.t),
-       f16 AS{mat} (SELECT a.c, b.t FROM f8 a JOIN f8 b ON b.c = a.t),
-       conv AS (SELECT CAST(count(*) AS BIGINT) AS moved
-                FROM f16 JOIN f1 ON f1.c = f16.t
-                WHERE f1.t <> f16.t),
-       lab AS{mat} (SELECT f16.c, f16.t AS basin FROM f16),
-       ridge AS (SELECT CAST(count(DISTINCT a.c) AS BIGINT)
-                   AS ridge_cells
-                 FROM lab a
-                 JOIN grid ga ON ga.c = a.c
-                 JOIN grid gb ON abs(gb.gx - ga.gx) <= 1
-                             AND abs(gb.gy - ga.gy) <= 1
-                             AND gb.c <> ga.c
-                 JOIN lab b ON b.c = gb.c AND b.basin <> a.basin)
-       SELECT CAST(lab.basin AS BIGINT) AS basin_sink,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(sum(lab.c) AS BIGINT) AS cell_checksum,
-              ridge.ridge_cells, conv.moved AS conv_resid
-       FROM lab CROSS JOIN ridge CROSS JOIN conv
-       GROUP BY lab.basin, ridge.ridge_cells, conv.moved"""
-
-
-@query("q521_watershed_basins", _q521_sql("//", " MATERIALIZED"))
-def q521(spark, sf_dir):
-    """Watershed basin delineation — label every cell with the sink
-    it drains to (the r.watershed / GDAL-adjacent basin op; the
-    multi-sink generalization q519's single cone cannot show): the
-    DEM is the MIN of two offset paraboloids (+3 on one so inter-
-    cone plateau ties cannot mint spurious sinks — exactly 2 sinks
-    survive, checked in design), D8 steepest descent as in
-    q519/q520, and the sink label rides POINTER DOUBLING: sinks map
-    to themselves, then f2 = f1(f1), f4, f8, f16 — 4 composition
-    joins cover the measured max path of 11 (vs 11 sequential
-    rounds; the suffix-array doubling rule applied to a functional
-    graph), with convergence PROVEN in-query: one more f1 step after
-    f16 moves nothing (conv_resid == 0).  Output: both basins land
-    at exactly 128 cells with order-sensitive cell-id checksums, and
-    the drainage divide is emitted as ridge_cells = 60 (cells with
-    an 8-neighbor in the other basin) — the ridge between two
-    paraboloids is where the +3 tilts the min.  The ORACLE keeps the
-    shared SQL shape (MATERIALIZED stages); the ENGINE runs the
-    doubling as a DataFrame loop with localCheckpoint per step,
-    because each doubling references its prior stage TWICE and Spark
-    inlines CTEs per reference — the pure shared-SQL first cut
-    re-derived f1 sixteen times, 13.8 s for a 256-cell job (the
-    q276 inlining trap on the engine side; doubling chains are NOT
-    linear chains)."""
-    # ENGINE: the doubling chain references each prior stage TWICE, and
-    # Spark inlines CTEs per reference (the q276/q414 lesson) — a pure
-    # shared-SQL plan re-derived f1 sixteen times (13.8 s for 256
-    # cells).  DataFrame loop + localCheckpoint per doubling instead.
-    cells = (_t(spark, sf_dir, "documents")
-             .select((F.col("doc_id") % 256).alias("c")).distinct())
-    grid = cells.select(
-        "c", (F.col("c") % 16).alias("gx"),
-        F.expr("c div 16").alias("gy")).withColumn(
-        "dem", F.least(
-            (F.col("gx") - 4) * (F.col("gx") - 4)
-            + (F.col("gy") - 4) * (F.col("gy") - 4),
-            (F.col("gx") - 11) * (F.col("gx") - 11)
-            + (F.col("gy") - 10) * (F.col("gy") - 10) + 3)) \
-        .localCheckpoint()
-    offs = spark.createDataFrame(
-        [(-1, -1, 0), (-1, 0, 1), (-1, 1, 2), (0, -1, 3),
-         (0, 1, 4), (1, -1, 5), (1, 0, 6), (1, 1, 7)],
-        "dx int, dy int, k int")
-    nb = grid.select(F.col("gx").alias("nx"), F.col("gy").alias("ny"),
-                     F.col("dem").alias("ndem"))
-    pick = (grid.crossJoin(F.broadcast(offs))
-            .join(nb, (F.col("nx") == F.col("gx") + F.col("dx"))
-                  & (F.col("ny") == F.col("gy") + F.col("dy")))
-            .filter(F.col("ndem") < F.col("dem"))
-            .groupBy("c", "gx", "gy")
-            .agg((F.min(F.col("ndem") * 8 + F.col("k")) % 8)
-                 .alias("kk")))
-    flows = (pick.join(F.broadcast(offs), pick["kk"] == offs["k"])
-             .select("c", ((F.col("gx") + F.col("dx"))
-                           + 16 * (F.col("gy") + F.col("dy")))
-                     .alias("t")))
-    f = (flows.unionByName(
-            grid.join(flows.select("c"), "c", "left_anti")
-            .select("c", F.col("c").alias("t")))
-         .localCheckpoint())
-    f1 = f
-    for _ in range(4):                       # f2, f4, f8, f16
-        b = f.select(F.col("c").alias("bc"), F.col("t").alias("bt"))
-        f = (f.join(b, f["t"] == b["bc"])
-             .select("c", F.col("bt").alias("t")).localCheckpoint())
-    moved = (f.join(f1.select(F.col("c").alias("sc"),
-                              F.col("t").alias("st")),
-                    f["t"] == F.col("sc"))
-             .filter(F.col("st") != F.col("t")).count())
-    lab = f.select("c", F.col("t").alias("basin")).localCheckpoint()
-    ga = lab.join(grid.select("c", "gx", "gy"), "c")
-    gb = ga.select(F.col("c").alias("c2"), F.col("gx").alias("gx2"),
-                   F.col("gy").alias("gy2"),
-                   F.col("basin").alias("basin2"))
-    ridge = (ga.join(gb, (F.abs(F.col("gx2") - F.col("gx")) <= 1)
-                     & (F.abs(F.col("gy2") - F.col("gy")) <= 1)
-                     & (F.col("c2") != F.col("c"))
-                     & (F.col("basin2") != F.col("basin")))
-             .select("c").distinct().count())
-    return (lab.groupBy("basin")
-            .agg(F.count("*").cast("long").alias("n_cells"),
-                 F.sum("c").cast("long").alias("cell_checksum"))
-            .select(F.col("basin").cast("long").alias("basin_sink"),
-                    "n_cells", "cell_checksum",
-                    F.lit(ridge).cast("long").alias("ridge_cells"),
-                    F.lit(moved).cast("long").alias("conv_resid")))
-
-
-# --- HMM map matching (q522) ------------------------------------------------------------
-
-# Viterbi packing: cost*2^24 + base-8 path (8 steps x 3 bits = 24 bits
-# exactly); lexicographic min IS (cost, smallest-path) — the q517/q520
-# encode-the-tie-rule pattern carried to full path recovery.
-_Q522_P = 16777216
-
-
-def _q522_sql(divop: str, mat: str, tbl: str = "documents") -> str:
-    segs = """segs AS (SELECT 0 AS sid, 1 AS horiz, 0 AS cc,
-                       0 AS lo, 30 AS hi UNION ALL
-               SELECT 1, 1, 10, 0, 30 UNION ALL
-               SELECT 2, 1, 20, 0, 30 UNION ALL
-               SELECT 3, 0, 0, 0, 20 UNION ALL
-               SELECT 4, 0, 15, 0, 20 UNION ALL
-               SELECT 5, 0, 30, 0, 20)"""
-    # emission d^2: axis-aligned clamp, all integers
-    emis = ("CASE WHEN s.horiz = 1 THEN "
-            "greatest(s.lo - p.px, p.px - s.hi, 0)"
-            "*greatest(s.lo - p.px, p.px - s.hi, 0)"
-            " + (p.py - s.cc)*(p.py - s.cc) "
-            "ELSE greatest(s.lo - p.py, p.py - s.hi, 0)"
-            "*greatest(s.lo - p.py, p.py - s.hi, 0)"
-            " + (p.px - s.cc)*(p.px - s.cc) END")
-    stages = []
-    for t in range(1, 8):
-        stages.append(f"""v{t} AS{mat} (
-         SELECT v.g, s.sid,
-                min((v.k {divop} {_Q522_P}
-                     + CASE WHEN ps.sid = s.sid THEN 0
-                            WHEN ps.horiz <> s.horiz THEN 50
-                            ELSE 10000 END
-                     + {emis}) * {_Q522_P}
-                    + ((v.k % {_Q522_P}) * 8 + s.sid)) AS k
-         FROM v{t-1} v
-         JOIN segs ps ON ps.sid = v.sid
-         CROSS JOIN segs s
-         JOIN pts p ON p.g = v.g AND p.t = {t}
-         GROUP BY v.g, s.sid)""")
-    chain = ",\n       ".join(stages)
-    return f"""WITH {segs},
-       tt AS (SELECT 0 AS t, 2097152 AS tpow UNION ALL
-              SELECT 1, 262144 UNION ALL SELECT 2, 32768 UNION ALL
-              SELECT 3, 4096 UNION ALL SELECT 4, 512 UNION ALL
-              SELECT 5, 64 UNION ALL SELECT 6, 8 UNION ALL
-              SELECT 7, 1),
-       tr AS (SELECT DISTINCT doc_id % 20 AS g FROM {tbl}),
-       pts AS{mat} (
-         SELECT g, t,
-                CASE WHEN g % 4 = 3 AND t >= 4
-                     THEN 15 + (g*5 + t) % 3 - 1
-                     ELSE (g % 3) + 4*t END AS px,
-                CASE WHEN g % 4 = 3 AND t >= 4 THEN 10 + 2*(t-3)
-                     WHEN t = g % 8 THEN 4
-                     ELSE 10 + (g*7 + t*5) % 5 - 2 END AS py
-         FROM tr CROSS JOIN tt),
-       v0 AS{mat} (
-         SELECT p.g, s.sid,
-                ({emis}) * {_Q522_P} + s.sid AS k
-         FROM pts p CROSS JOIN segs s WHERE p.t = 0),
-       {chain},
-       best AS{mat} (
-         SELECT g, min(k) AS k FROM v7 GROUP BY g),
-       path AS{mat} (
-         SELECT best.g, tt.t,
-                (best.k % {_Q522_P}) {divop} tt.tpow % 8 AS vseg
-         FROM best CROSS JOIN tt),
-       greedy AS{mat} (
-         SELECT p.g, p.t,
-                min(({emis}) * 8 + s.sid) % 8 AS gseg
-         FROM pts p CROSS JOIN segs s
-         GROUP BY p.g, p.t),
-       flips AS (SELECT path.g,
-                        CAST(sum(CASE WHEN path.vseg <> greedy.gseg
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                          AS greedy_flips
-                 FROM path JOIN greedy ON greedy.g = path.g
-                                      AND greedy.t = path.t
-                 GROUP BY path.g),
-       ginv AS (SELECT a.g,
-                       CAST(sum(CASE WHEN sa.sid <> sb.sid
-                                      AND sa.horiz = sb.horiz
-                                THEN 1 ELSE 0 END) AS BIGINT)
-                         AS greedy_invalid
-                FROM greedy a JOIN greedy b
-                  ON b.g = a.g AND b.t = a.t + 1
-                JOIN segs sa ON sa.sid = a.gseg
-                JOIN segs sb ON sb.sid = b.gseg
-                GROUP BY a.g),
-       vinv AS (SELECT a.g,
-                       CAST(sum(CASE WHEN sa.sid <> sb.sid
-                                      AND sa.horiz = sb.horiz
-                                THEN 1 ELSE 0 END) AS BIGINT)
-                         AS viterbi_invalid
-                FROM path a JOIN path b
-                  ON b.g = a.g AND b.t = a.t + 1
-                JOIN segs sa ON sa.sid = a.vseg
-                JOIN segs sb ON sb.sid = b.vseg
-                GROUP BY a.g),
-       pstr AS (SELECT g,
-                       CAST(sum(vseg * tpow) AS BIGINT) AS path_code
-                FROM path JOIN tt ON tt.t = path.t
-                GROUP BY g)
-       SELECT best.g AS trace_id,
-              CAST(best.k {divop} {_Q522_P} AS BIGINT) AS viterbi_cost,
-              pstr.path_code,
-              flips.greedy_flips, ginv.greedy_invalid,
-              vinv.viterbi_invalid
-       FROM best JOIN pstr ON pstr.g = best.g
-       JOIN flips ON flips.g = best.g
-       JOIN ginv ON ginv.g = best.g
-       JOIN vinv ON vinv.g = best.g"""
-
-
-@query("q522_hmm_map_matching", _q522_sql("//", " MATERIALIZED"))
-def q522(spark, sf_dir):
-    """HMM map matching (Newson & Krumm 2009 — the GPS-trace-to-road
-    snapper; the TEMPORAL model q415's greedy per-point snap lacks):
-    Viterbi over 8 trace points x 6 axis-aligned road segments with
-    integer squared-distance emissions (clamped point-to-segment —
-    greatest(lo-p, p-hi, 0) keeps everything integer) and pinned
-    transitions (0 stay / 50 turn onto a crossing segment / 10000
-    for the impossible same-orientation jump).  The whole dynamic
-    program rides ONE packed BIGINT per state: cost*2^24 + base-8
-    path — 8 steps x 3 bits fill the low word exactly, so min() IS
-    the (cost, lexicographically-smallest-path) rule and the FULL
-    Viterbi path pops out of the final aggregate with no backtrack
-    pass (the q517/q520 encode-the-tie-rule pattern carried to path
-    recovery; bit 63 stays far away per the q476 cap).  Three-quarters of
-    the traces follow the middle road with one planted outlier
-    dipping to y=4: the greedy snapper flips to the wrong parallel
-    road there (and onto crossing verticals near intersections),
-    emitting greedy_flips > 0 and — the damning column —
-    greedy_invalid same-orientation jumps no vehicle can drive,
-    while viterbi_invalid is computed from the recovered path and
-    lands 0 on every trace: continuity is the whole reason the HMM
-    exists.  The remaining quarter GENUINELY TURN onto the crossing
-    vertical at t = 4 (staying would cost 120 in emissions vs one
-    50 transition), recovering path 1111 4444 — without this plant
-    every optimal path was transition-free and the turn-accepting
-    branch was dead (the degenerate-knob inspection on the
-    transition model itself).
-    Linear 8-stage shared-SQL chain (divop + MATERIALIZED
-    parametrized), each stage one (traces x 36) join — at fleet
-    scale the trace axis is the parallelism."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q522_documents")
-    return spark.sql(_q522_sql("div", "", "q522_documents"))
-
-
-# --- Cross-K, colocation mining, discrete Frechet (q523-q525) --------------------------
-
-
-def _q523_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH a AS (SELECT doc_id {divop} 5 AS i,
-                      ((doc_id {divop} 5)*37) % 96 AS ax,
-                      ((doc_id {divop} 5)*59) % 84 AS ay
-               FROM {tbl} WHERE doc_id % 5 = 0),
-       b AS (SELECT s, a.i,
-                    CASE WHEN s = 0
-                         THEN (a.ax + (a.i*7) % 5 - 2 + 96) % 96
-                         ELSE (a.i*43) % 96 END AS bx,
-                    CASE WHEN s = 0
-                         THEN (a.ay + (a.i*11) % 5 - 2 + 84) % 84
-                         ELSE (a.i*71) % 84 END AS by
-             FROM a CROSS JOIN (SELECT 0 AS s UNION ALL SELECT 1) sv),
-       radii AS (SELECT 2 AS r UNION ALL SELECT 4 UNION ALL SELECT 8),
-       pairs AS (SELECT b.s, radii.r,
-                        CAST(count(*) AS BIGINT) AS n_ab
-                 FROM a JOIN b ON 1=1
-                 CROSS JOIN radii
-                 WHERE (a.ax-b.bx)*(a.ax-b.bx)
-                       + (a.ay-b.by)*(a.ay-b.by) <= radii.r*radii.r
-                 GROUP BY b.s, radii.r)
-       SELECT radii.r,
-              coalesce(max(CASE WHEN pairs.s = 0 THEN n_ab END), 0)
-                AS pairs_attr,
-              coalesce(max(CASE WHEN pairs.s = 1 THEN n_ab END), 0)
-                AS pairs_indep,
-              CAST(8064 * coalesce(max(CASE WHEN pairs.s = 0
-                                       THEN n_ab END), 0) AS DOUBLE)
-                / 10000.0 AS khat_attr,
-              CAST(8064 * coalesce(max(CASE WHEN pairs.s = 1
-                                       THEN n_ab END), 0) AS DOUBLE)
-                / 10000.0 AS khat_indep,
-              CAST(CASE WHEN coalesce(max(CASE WHEN pairs.s = 0
-                                          THEN n_ab END), 0)
-                             > coalesce(max(CASE WHEN pairs.s = 1
-                                            THEN n_ab END), 0)
-                   THEN 1 ELSE 0 END AS BIGINT) AS attracting
-       FROM radii LEFT JOIN pairs ON pairs.r = radii.r
-       GROUP BY radii.r"""
-
-
-@query("q523_cross_k_bivariate", _q523_sql("//"))
-def q523(spark, sf_dir):
-    """Bivariate cross-K — Ripley's K between TWO point types
-    (Lotwick & Silverman 1982; does type B cluster AROUND type A,
-    the question q502's univariate K cannot ask): exact integer A-B
-    pair counts at r = 2/4/8 for an attraction surface (each B
-    planted within a +-2 torus offset of its paired A) vs an
-    independent twin sharing A.  The verdict is per-radius and the
-    CURVE is the story: attraction dominates 60-vs-23 at r=2 and
-    121-vs-39 at r=4, then WASHES OUT by r=8 (191 vs 201, flag 0)
-    — interaction is a short-range property and a single-radius
-    test would miss or overstate it; the flag flips exactly where
-    the planted offset scale (+-2) is exhausted.  khat = A*pairs/
-    (nA*nB) rides as one float division.  ENGINE mirrors q502's
-    banded-join shape; at 100x100 the oracle's quadratic join is
-    the same plan."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q523_documents")
-    return spark.sql(_q523_sql("div", "q523_documents"))
-
-
-def _q524_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH idx AS (SELECT doc_id {divop} 5 AS i FROM {tbl}
-               WHERE doc_id % 5 = 0),
-       a AS (SELECT i, (i*37) % 96 AS x, (i*59) % 84 AS y FROM idx),
-       b AS (SELECT idx.i,
-                    CASE WHEN idx.i % 10 < 7
-                         THEN (a.x + (idx.i*13) % 5 - 2 + 96) % 96
-                         ELSE (idx.i*47) % 96 END AS x,
-                    CASE WHEN idx.i % 10 < 7
-                         THEN (a.y + (idx.i*17) % 5 - 2 + 84) % 84
-                         ELSE (idx.i*29) % 84 END AS y
-             FROM idx JOIN a ON a.i = idx.i),
-       c AS (SELECT i, (i*53) % 96 AS x, (i*61) % 84 AS y FROM idx),
-       feats AS (SELECT 'A' AS ft, i, x, y FROM a
-                 UNION ALL SELECT 'B', i, x, y FROM b
-                 UNION ALL SELECT 'C', i, x, y FROM c),
-       pat AS (SELECT 'AB' AS pattern, 'A' AS f1, 'B' AS f2 UNION ALL
-               SELECT 'AC', 'A', 'C' UNION ALL SELECT 'BC', 'B', 'C'),
-       part AS (SELECT pat.pattern,
-                       CAST(count(DISTINCT CASE WHEN u.ft = pat.f1
-                                           THEN u.i END) AS BIGINT)
-                         AS n1_with,
-                       CAST(count(DISTINCT CASE WHEN u.ft = pat.f2
-                                           THEN u.i END) AS BIGINT)
-                         AS n2_with
-                FROM pat
-                JOIN feats u ON u.ft IN (pat.f1, pat.f2)
-                JOIN feats v
-                  ON v.ft = CASE WHEN u.ft = pat.f1
-                            THEN pat.f2 ELSE pat.f1 END
-                 AND (u.x-v.x)*(u.x-v.x) + (u.y-v.y)*(u.y-v.y) <= 8
-                GROUP BY pat.pattern),
-       n AS (SELECT CAST(count(*) AS BIGINT) AS n_feat FROM idx)
-       SELECT pat.pattern,
-              coalesce(part.n1_with, 0) AS n1_with,
-              coalesce(part.n2_with, 0) AS n2_with,
-              n.n_feat,
-              CAST(least(coalesce(part.n1_with, 0),
-                         coalesce(part.n2_with, 0)) AS DOUBLE)
-                / CAST(n.n_feat AS DOUBLE) AS participation_index,
-              CAST(CASE WHEN 2 * coalesce(part.n1_with, 0) >= n.n_feat
-                         AND 2 * coalesce(part.n2_with, 0) >= n.n_feat
-                   THEN 1 ELSE 0 END AS BIGINT) AS prevalent
-       FROM pat LEFT JOIN part ON part.pattern = pat.pattern
-       CROSS JOIN n"""
-
-
-@query("q524_colocation_mining", _q524_sql("//"))
-def q524(spark, sf_dir):
-    """Colocation pattern mining — the participation index (Shekhar
-    & Huang 2001; 'which feature TYPES co-occur in space', the
-    association-rule idea transplanted to maps where transactions
-    don't exist): for each candidate pattern {f1, f2}, the
-    participation ratio of f1 is the fraction of f1 instances with
-    an f2 neighbor (r^2 <= 8), and PI = min of the two ratios —
-    exact DISTINCT-instance counts with the >= 0.5 prevalence
-    verdict cross-multiplied in integers.  One UNION'd feature
-    table and one neighbor join evaluate ALL three candidate
-    patterns simultaneously (the CASE flips which side counts,
-    never three scans).  Stations and shops are planted colocated
-    (70% of shops within +-2 of their station; participation lands
-    75/76), parks are independent hash (31-38% coincidental
-    neighbors — comfortably under the bar on both sides): AB
-    prevalent, AC/BC not.  At corpus scale the neighbor join is
-    the q11 banded two-phase shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q524_documents")
-    return spark.sql(_q524_sql("div", "q524_documents"))
-
-
-_Q525_TRAJ = """SELECT k, t,
-              CASE WHEN k = 5 THEN 4*(7-t)
-                   WHEN k = 4 THEN (t*t*28) {d} 49
-                   ELSE 4*t END AS x,
-              CASE WHEN k = 5 THEN 20 + ((7-t)*5) % 3 - 1
-                   WHEN k = 3 THEN 32 + (21 + t*5) % 3 - 1
-                   WHEN k = 2 THEN 20
-                        + CASE WHEN t IN (3, 4) THEN 12 ELSE 0 END
-                        + (14 + t*5) % 3 - 1
-                   ELSE 20 + (k*7 + t*5) % 3 - 1 END AS y
-       FROM (SELECT DISTINCT doc_id % 6 AS k FROM {tbl}) ks
-       CROSS JOIN (SELECT 0 AS t UNION ALL SELECT 1 UNION ALL
-                   SELECT 2 UNION ALL SELECT 3 UNION ALL SELECT 4
-                   UNION ALL SELECT 5 UNION ALL SELECT 6
-                   UNION ALL SELECT 7) ts"""
-
-
-def _q525_oracle() -> str:
-    traj = _Q525_TRAJ.replace("{d}", "//").replace("{tbl}", "documents")
-    stages = []
-    for s in range(1, 15):
-        stages.append(f"""f{s} AS MATERIALIZED (
-         SELECT d.pa, d.pb, d.i, d.j, d.d2,
-                greatest(d.d2,
-                         least(coalesce(l1.f, 99999999),
-                               coalesce(u1.f, 99999999),
-                               coalesce(dg.f, 99999999))) AS f
-         FROM pd d
-         LEFT JOIN f{s-1} l1 ON l1.pa = d.pa AND l1.pb = d.pb
-                            AND l1.i = d.i - 1 AND l1.j = d.j
-         LEFT JOIN f{s-1} u1 ON u1.pa = d.pa AND u1.pb = d.pb
-                            AND u1.i = d.i AND u1.j = d.j - 1
-         LEFT JOIN f{max(0, s-2)} dg ON dg.pa = d.pa AND dg.pb = d.pb
-                            AND dg.i = d.i - 1 AND dg.j = d.j - 1
-         WHERE d.i + d.j = {s})""")
-    chain = ",\n       ".join(stages)
-    return f"""WITH traj AS MATERIALIZED ({traj}),
-       pairs AS (SELECT a.k AS pa, b.k AS pb
-                 FROM (SELECT DISTINCT k FROM traj) a
-                 JOIN (SELECT DISTINCT k FROM traj) b ON b.k > a.k),
-       pd AS MATERIALIZED (
-         SELECT pairs.pa, pairs.pb, ta.t AS i, tb.t AS j,
-                (ta.x-tb.x)*(ta.x-tb.x)
-                  + (ta.y-tb.y)*(ta.y-tb.y) AS d2
-         FROM pairs
-         JOIN traj ta ON ta.k = pairs.pa
-         JOIN traj tb ON tb.k = pairs.pb),
-       f0 AS MATERIALIZED (
-         SELECT pa, pb, i, j, d2, d2 AS f FROM pd
-         WHERE i = 0 AND j = 0),
-       {chain},
-       fr AS (SELECT pa, pb, CAST(f AS BIGINT) AS frechet_d2
-              FROM f14 WHERE i = 7 AND j = 7),
-       hab AS (SELECT pa, pb, CAST(max(md) AS BIGINT) AS h
-               FROM (SELECT pa, pb, i, min(d2) AS md
-                     FROM pd GROUP BY pa, pb, i) x
-               GROUP BY pa, pb),
-       hba AS (SELECT pa, pb, CAST(max(md) AS BIGINT) AS h
-               FROM (SELECT pa, pb, j, min(d2) AS md
-                     FROM pd GROUP BY pa, pb, j) x
-               GROUP BY pa, pb)
-       SELECT fr.pa, fr.pb, fr.frechet_d2,
-              CAST(greatest(hab.h, hba.h) AS BIGINT) AS hausdorff_d2,
-              CAST(CASE WHEN greatest(hab.h, hba.h) <= fr.frechet_d2
-                   THEN 1 ELSE 0 END AS BIGINT) AS hd_le_fr
-       FROM fr JOIN hab ON hab.pa = fr.pa AND hab.pb = fr.pb
-       JOIN hba ON hba.pa = fr.pa AND hba.pb = fr.pb"""
-
-
-@query("q525_discrete_frechet", _q525_oracle())
-def q525(spark, sf_dir):
-    """Discrete Frechet distance — the ORDER-AWARE trajectory metric
-    (Eiter & Mannila 1994; the dog-leash distance): F(i,j) =
-    max(d2(i,j), min(F(i-1,j), F(i,j-1), F(i-1,j-1))), all exact
-    integers, over 15 trajectory pairs, with symmetric Hausdorff
-    alongside and the containment theorem Hausdorff <= Frechet
-    emitted as a computed flag on every pair.  The flagship plant:
-    trajectory 5 is trajectory 0 REVERSED — the identical point set
-    walked backwards — so Hausdorff (a set metric) scores 0 while
-    Frechet scores 788: direction is invisible to every set
-    distance, which is the entire reason the leash metric exists.
-    A detour (dip rows, 160), a parallel offset (144), and a
-    nonuniformly-parameterized twin (16 — time-warping absorbed)
-    fill out the spectrum.  ENGINE: the DP is genuinely sequential
-    per pair — the per-entity recurrence template (q470 family):
-    one applyInPandas over pair groups, the 8x8 table in exact
-    int64; ORACLE: 14 antidiagonal wavefront stages, each
-    MATERIALIZED and reading only stages s-1/s-2 (the doubling-trap
-    rule respected: references stay bounded)."""
-    import pandas as pd
-
-    docs = _t(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("q525_documents")
-    traj = spark.sql(_Q525_TRAJ.replace("{d}", "div")
-                     .replace("{tbl}", "q525_documents"))
-    a = traj.select(F.col("k").alias("pa"), F.col("t").alias("i"),
-                    F.col("x").alias("ax"), F.col("y").alias("ay"))
-    b = traj.select(F.col("k").alias("pb"), F.col("t").alias("j"),
-                    F.col("x").alias("bx"), F.col("y").alias("by"))
-    pd_df = (a.join(b, F.col("pb") > F.col("pa"))
-             .withColumn("d2", (F.col("ax") - F.col("bx"))
-                         * (F.col("ax") - F.col("bx"))
-                         + (F.col("ay") - F.col("by"))
-                         * (F.col("ay") - F.col("by"))))
-
-    def dp(key, g: pd.DataFrame) -> pd.DataFrame:
-        n = 8
-        D = [[0] * n for _ in range(n)]
-        for r in g.itertuples():
-            D[r.i][r.j] = int(r.d2)
-        Ftab = [[0] * n for _ in range(n)]
-        for i in range(n):
-            for j in range(n):
-                d = D[i][j]
-                if i == 0 and j == 0:
-                    Ftab[i][j] = d
-                elif i == 0:
-                    Ftab[i][j] = max(d, Ftab[0][j - 1])
-                elif j == 0:
-                    Ftab[i][j] = max(d, Ftab[i - 1][0])
-                else:
-                    Ftab[i][j] = max(d, min(Ftab[i - 1][j],
-                                            Ftab[i][j - 1],
-                                            Ftab[i - 1][j - 1]))
-        h1 = max(min(D[i][j] for j in range(n)) for i in range(n))
-        h2 = max(min(D[i][j] for i in range(n)) for j in range(n))
-        h = max(h1, h2)
-        fr = Ftab[n - 1][n - 1]
-        return pd.DataFrame(
-            {"pa": [int(key[0])], "pb": [int(key[1])],
-             "frechet_d2": [fr], "hausdorff_d2": [h],
-             "hd_le_fr": [1 if h <= fr else 0]})
-
-    return pd_df.groupBy("pa", "pb").applyInPandas(
-        dp, "pa long, pb long, frechet_d2 long, hausdorff_d2 long, "
-            "hd_le_fr long")
-
-
-# --- Quantile sketch, Luby MIS labels, Chaikin smoothing (q526-q528) --------------------
-
-
-def _q526_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH vals AS (SELECT doc_id, doc_id % 4 AS p,
-                      (doc_id*7919) % 10000 AS v
-               FROM {tbl}),
-       ranked AS (SELECT p, v,
-                         row_number() OVER (PARTITION BY p
-                           ORDER BY v, doc_id) AS rn
-                  FROM vals),
-       np AS (SELECT p AS pp, CAST(count(*) AS BIGINT) AS n_p
-              FROM vals GROUP BY p),
-       j8 AS (SELECT 1 AS j UNION ALL SELECT 2 UNION ALL SELECT 3
-              UNION ALL SELECT 4 UNION ALL SELECT 5 UNION ALL
-              SELECT 6 UNION ALL SELECT 7 UNION ALL SELECT 8),
-       sketch AS (SELECT ranked.p, j8.j, ranked.v AS boundary,
-                         (j8.j * np.n_p + 7) {divop} 8
-                           - ((j8.j - 1) * np.n_p + 7) {divop} 8
-                           AS wt
-                  FROM ranked JOIN np ON np.pp = ranked.p
-                  JOIN j8 ON ranked.rn = (j8.j * np.n_p + 7) {divop} 8),
-       probes AS (SELECT 625 AS q UNION ALL SELECT 1875 UNION ALL
-                  SELECT 3125 UNION ALL SELECT 4375 UNION ALL
-                  SELECT 5625 UNION ALL SELECT 6875 UNION ALL
-                  SELECT 8125 UNION ALL SELECT 9375),
-       est AS (SELECT probes.q,
-                      CAST(sum(CASE WHEN sketch.boundary <= probes.q
-                               THEN sketch.wt ELSE 0 END) AS BIGINT)
-                        AS est_rank
-               FROM probes CROSS JOIN sketch GROUP BY probes.q),
-       tru AS (SELECT probes.q,
-                      CAST(sum(CASE WHEN vals.v <= probes.q
-                               THEN 1 ELSE 0 END) AS BIGINT)
-                        AS true_rank
-               FROM probes CROSS JOIN vals GROUP BY probes.q),
-       bnd AS (SELECT CAST(sum((n_p + 7) {divop} 8) AS BIGINT)
-                 AS bound
-               FROM np)
-       SELECT est.q, est.est_rank, tru.true_rank,
-              CAST(tru.true_rank - est.est_rank AS BIGINT) AS deficit,
-              bnd.bound,
-              CAST(CASE WHEN tru.true_rank - est.est_rank >= 0
-                         AND tru.true_rank - est.est_rank <= bnd.bound
-                   THEN 1 ELSE 0 END AS BIGINT) AS within_bound
-       FROM est JOIN tru ON tru.q = est.q CROSS JOIN bnd"""
-
-
-@query("q526_quantile_sketch_merge", _q526_sql("//"))
-def q526(spark, sf_dir):
-    """Mergeable equi-depth quantile sketch with a PROVEN rank-error
-    audit — the distributed-percentile primitive (GK/KLL's exact-
-    arithmetic cousin; what approxQuantile does behind the curtain):
-    each of 4 partitions keeps only its 8 equi-depth boundaries with
-    exact integer bucket weights (rank picks at ceil(j*n_p/8), tie
-    order pinned by (v, doc_id)), the merged 32-row sketch answers
-    rank queries as a weighted sum, and the error THEOREM rides in
-    the output: est counts only full buckets whose boundary cleared
-    the probe, so 0 <= true - est <= sum_p ceil(n_p/8) — the
-    deficit is always one-sided and bounded by one bucket per
-    partition, emitted with within_bound == 1 on all 8 probes.  The
-    128:1 compression (500 rows -> 32 sketch rows) is the scale
-    story: at corpus size only the sketch crosses the shuffle.  All
-    integer arithmetic, one shared SQL text."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q526_documents")
-    return spark.sql(_q526_sql("div", "q526_documents"))
-
-
-def _q527_oracle() -> str:
-    rounds = []
-    for r in range(1, 11):
-        rounds.append(f"""m{r} AS MATERIALIZED (
-         SELECT u.node FROM s{r-1} u
-         WHERE u.st = 0 AND NOT EXISTS (
-           SELECT 1 FROM conf
-           JOIN s{r-1} v ON v.node = conf.b AND v.st = 0
-           JOIN lbl pv ON pv.node = conf.b
-           JOIN lbl pu ON pu.node = u.node
-           WHERE conf.a = u.node AND pv.pr < pu.pr)),
-       s{r} AS MATERIALIZED (
-         SELECT p.node,
-                CASE WHEN p.st <> 0 THEN p.st
-                     WHEN p.node IN (SELECT node FROM m{r}) THEN 1
-                     WHEN EXISTS (SELECT 1 FROM conf
-                                  JOIN m{r} ON m{r}.node = conf.b
-                                  WHERE conf.a = p.node) THEN 2
-                     ELSE 0 END AS st
-         FROM s{r-1} p)""")
-    chain = ",\n       ".join(rounds)
-    sel_counts = " UNION ALL ".join(
-        f"SELECT {r} AS rnd, CAST((SELECT count(*) FROM m{r}) "
-        f"AS BIGINT) AS n_selected" for r in range(1, 11))
-    return f"""WITH anchors AS (
-         SELECT doc_id,
-                row_number() OVER (ORDER BY doc_id) - 1 AS s
-         FROM documents WHERE doc_id % 10 < 3),
-       lbl AS MATERIALIZED (
-         SELECT doc_id AS node, 3*(s // 5) AS x, 15*(s % 5) AS y,
-                CASE WHEN s % 5 < 2
-                     THEN (s % 5)*100 + s // 5
-                     ELSE 1000 + (doc_id*7919) % 9973 END AS pr
-         FROM anchors),
-       conf AS MATERIALIZED (
-         SELECT a.node AS a, b.node AS b
-         FROM lbl a JOIN lbl b
-           ON b.node <> a.node
-          AND abs(a.x - b.x) <= 6 AND abs(a.y - b.y) <= 6),
-       s0 AS MATERIALIZED (SELECT node, 0 AS st FROM lbl),
-       {chain},
-       per_round AS ({sel_counts}),
-       fin AS (SELECT
-                 CAST(sum(CASE WHEN st = 1 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_in,
-                 CAST(sum(CASE WHEN st = 2 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_out,
-                 CAST(sum(CASE WHEN st = 0 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_undecided
-               FROM s10),
-       indep AS (SELECT CAST(count(*) AS BIGINT) AS viol
-                 FROM conf
-                 JOIN s10 a ON a.node = conf.a AND a.st = 1
-                 JOIN s10 b ON b.node = conf.b AND b.st = 1),
-       maxv AS (SELECT CAST(count(*) AS BIGINT) AS not_covered
-                FROM s10 o WHERE o.st = 2 AND NOT EXISTS (
-                  SELECT 1 FROM conf
-                  JOIN s10 i ON i.node = conf.b AND i.st = 1
-                  WHERE conf.a = o.node))
-       SELECT per_round.rnd, per_round.n_selected,
-              fin.n_in, fin.n_out, fin.n_undecided,
-              indep.viol AS independence_viol,
-              maxv.not_covered AS maximality_viol
-       FROM per_round CROSS JOIN fin CROSS JOIN indep
-       CROSS JOIN maxv"""
-
-
-@query("q527_label_placement_mis", _q527_oracle())
-def q527(spark, sf_dir):
-    """Cartographic label placement as maximal independent set —
-    greedy-by-priority MIS run ROUND-SYNCHRONOUSLY (Luby's parallel
-    scheme made deterministic: an undecided label selects itself iff
-    its priority beats every undecided conflicting neighbor; losers
-    of a selected neighbor drop out), the map-rendering primitive
-    behind every tile server's collision pass.  Conflicts are
-    overlapping 6x6 label boxes on 5 rows of 30 anchors.  The
-    fixture plants BOTH convergence regimes: three hash-priority
-    rows finish in 1-2 rounds (Luby's expected-log behavior), while
-    two rows carry ASCENDING priorities — the adversarial order
-    where each round frees only the next chain minimum, selecting 2
-    per round for 10 rounds (per-round counts 24,5,2,2,... emitted
-    row-per-round); sequential-greedy IS this worst case, which is
-    why Luby randomizes.  Correctness is never assumed: the output
-    recomputes independence (no two selected labels conflict) and
-    maximality (every dropped label has a selected conflictor) from
-    the final state — both 0 — plus n_undecided == 0 for
-    termination.  ENGINE: 10 DataFrame rounds (anti-join local
-    minima, neighbor knockout) with localCheckpoint truncation;
-    ORACLE: 10 unrolled MATERIALIZED state rounds."""
-    docs = _t(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % 10 < 3)
-    w = Window.orderBy("doc_id")
-    anchors = docs.select(
-        "doc_id", (F.row_number().over(w) - 1).alias("s"))
-    lbl = anchors.select(
-        F.col("doc_id").alias("node"),
-        (3 * F.expr("s div 5")).alias("x"),
-        (15 * (F.col("s") % 5)).alias("y"),
-        F.when(F.col("s") % 5 < 2,
-               (F.col("s") % 5) * 100 + F.expr("s div 5"))
-        .otherwise(1000 + (F.col("doc_id") * 7919) % 9973)
-        .alias("pr")).localCheckpoint()
-    b = lbl.select(F.col("node").alias("b"), F.col("x").alias("bx"),
-                   F.col("y").alias("by"), F.col("pr").alias("bpr"))
-    conf = (lbl.join(b, (F.col("b") != F.col("node"))
-                     & (F.abs(F.col("bx") - F.col("x")) <= 6)
-                     & (F.abs(F.col("by") - F.col("y")) <= 6))
-            .select(F.col("node").alias("a"), "b", F.col("pr").alias("apr"),
-                    F.col("bpr")).localCheckpoint())
-    state = lbl.select("node", F.lit(0).alias("st"))
-    sel_log = []  # per-round counts are DEFERRED: one grouped count
-    # over the union of the (already-checkpointed) selections at the
-    # end replaces ten per-round .count() jobs (the q250 fuse rule)
-    for r in range(1, 11):
-        und = state.filter(F.col("st") == 0).select("node")
-        blocked = (conf.join(und.withColumnRenamed("node", "a"), "a")
-                   .join(und.withColumnRenamed("node", "b"), "b")
-                   .filter(F.col("bpr") < F.col("apr"))
-                   .select("a").distinct())
-        m = und.join(blocked.withColumnRenamed("a", "node"),
-                     "node", "left_anti").coalesce(2) \
-            .localCheckpoint()
-        sel_log.append(m.withColumn("rnd", F.lit(r)))
-        knocked = (conf.join(m.withColumnRenamed("node", "b"), "b")
-                   .select(F.col("a").alias("node")).distinct())
-        state = (state
-                 .join(m.withColumn("sel", F.lit(1)), "node", "left")
-                 .join(knocked.withColumn("ko", F.lit(1)), "node",
-                       "left")
-                 .select("node",
-                         F.when(F.col("st") != 0, F.col("st"))
-                         .when(F.col("sel") == 1, 1)
-                         .when(F.col("ko") == 1, 2)
-                         .otherwise(0).alias("st")))
-        if r % 3 == 0:
-            state = state.coalesce(4).localCheckpoint()
-    state = state.coalesce(4).localCheckpoint().toDF("node", "st")
-    logd = sel_log[0]
-    for m2 in sel_log[1:]:
-        logd = logd.unionByName(m2)
-    per_round = {int(x["rnd"]): int(x["n"]) for x in
-                 logd.groupBy("rnd")
-                 .agg(F.count("*").alias("n")).collect()}
-    # the three final certificates fuse into ONE plan / ONE collect
-    sa = state.select(F.col("node").alias("a"), F.col("st").alias("sta"))
-    sb = state.select(F.col("node").alias("b"), F.col("st").alias("stb"))
-    fin_agg = state.agg(
-        F.sum(F.when(F.col("st") == 1, 1).otherwise(0)).alias("n_in"),
-        F.sum(F.when(F.col("st") == 2, 1).otherwise(0)).alias("n_out"),
-        F.sum(F.when(F.col("st") == 0, 1).otherwise(0))
-        .alias("n_und"))
-    viol_agg = (conf.join(sa, "a").join(sb, "b")
-                .filter((F.col("sta") == 1) & (F.col("stb") == 1))
-                .agg(F.count("*").alias("viol")))
-    covered = (conf.join(sb.filter(F.col("stb") == 1), "b")
-               .select("a").distinct())
-    notcov_agg = (state.filter(F.col("st") == 2)
-                  .join(covered.withColumnRenamed("a", "node"),
-                        "node", "left_anti")
-                  .agg(F.count("*").alias("notcov")))
-    fin = fin_agg.crossJoin(viol_agg).crossJoin(notcov_agg) \
-        .collect()[0]
-    rows = [(r, per_round.get(r, 0), int(fin["n_in"]),
-             int(fin["n_out"]), int(fin["n_und"]),
-             int(fin["viol"]), int(fin["notcov"]))
-            for r in range(1, 11)]
-    return local_df(
-        spark, rows,
-        "rnd long, n_selected long, n_in long, n_out long, "
-        "n_undecided long, independence_viol long, "
-        "maximality_viol long")
-
-
-def _q528_sql(divop: str, tbl: str = "documents") -> str:
-    base = """SELECT i, i*8 + (i*i*3) % 7 AS x,
-                     20 + (i % 2) * 12 AS y
-              FROM (SELECT DISTINCT doc_id % 12 AS i FROM {tbl}) ii"""
-    rnd = """SELECT 0 AS idx, x*4 AS x, y*4 AS y FROM {src}
-             WHERE i = 0
-             UNION ALL
-             SELECT 2*a.i + 1, 3*a.x + b.x, 3*a.y + b.y
-             FROM {src} a JOIN {src} b ON b.i = a.i + 1
-             UNION ALL
-             SELECT 2*a.i + 2, a.x + 3*b.x, a.y + 3*b.y
-             FROM {src} a JOIN {src} b ON b.i = a.i + 1
-             UNION ALL
-             SELECT 2*{m} - 1, x*4, y*4 FROM {src}
-             WHERE i = {m} - 1"""
-    return f"""WITH p0 AS ({base.format(tbl=tbl)}),
-       r1 AS ({rnd.format(src='p0', m=12)
-               .replace('0 AS idx', '0 AS i')
-               .replace('2*a.i + 1,', '2*a.i + 1 AS i,')}),
-       r2 AS ({rnd.format(src='r1', m=24)
-               .replace('0 AS idx', '0 AS i')
-               .replace('2*a.i + 1,', '2*a.i + 1 AS i,')}),
-       tp AS (SELECT 'orig' AS src,
-                     (b.x-a.x)*(c.y-b.y)
-                       - (b.y-a.y)*(c.x-b.x) AS cr1,
-                     (c.x-b.x)*(d.y-c.y)
-                       - (c.y-b.y)*(d.x-c.x) AS cr2,
-                     0 AS pad
-              FROM p0 a JOIN p0 b ON b.i = a.i + 1
-              JOIN p0 c ON c.i = a.i + 2
-              JOIN p0 d ON d.i = a.i + 3
-              UNION ALL
-              SELECT 'smooth',
-                     (b.x-a.x)*(c.y-b.y) - (b.y-a.y)*(c.x-b.x),
-                     (c.x-b.x)*(d.y-c.y) - (c.y-b.y)*(d.x-c.x), 0
-              FROM r2 a JOIN r2 b ON b.i = a.i + 1
-              JOIN r2 c ON c.i = a.i + 2
-              JOIN r2 d ON d.i = a.i + 3),
-       turns AS (SELECT src, CAST(count(*) AS BIGINT) AS flips
-                 FROM tp
-                 WHERE (cr1 > 0 AND cr2 < 0) OR (cr1 < 0 AND cr2 > 0)
-                 GROUP BY src),
-       sharp AS (SELECT src, CAST(count(*) AS BIGINT) AS n_sharp
-                 FROM (
-                   SELECT 'orig' AS src,
-                          (b.x-a.x)*(c.x-b.x)
-                            + (b.y-a.y)*(c.y-b.y) AS dt
-                   FROM p0 a JOIN p0 b ON b.i = a.i + 1
-                   JOIN p0 c ON c.i = a.i + 2
-                   UNION ALL
-                   SELECT 'smooth',
-                          (b.x-a.x)*(c.x-b.x) + (b.y-a.y)*(c.y-b.y)
-                   FROM r2 a JOIN r2 b ON b.i = a.i + 1
-                   JOIN r2 c ON c.i = a.i + 2) s
-                 WHERE dt < 0 GROUP BY src),
-       stats AS (SELECT CAST(count(*) AS BIGINT) AS n_vertices,
-                        CAST(sum((i+1)*(x + 2*y)) AS BIGINT)
-                          AS checksum,
-                        CAST(min(x) AS BIGINT) AS min_x,
-                        CAST(max(x) AS BIGINT) AS max_x
-                 FROM r2)
-       SELECT stats.n_vertices, stats.checksum,
-              stats.min_x, stats.max_x,
-              coalesce(max(CASE WHEN turns.src = 'orig'
-                           THEN turns.flips END), 0) AS flips_orig,
-              coalesce(max(CASE WHEN turns.src = 'smooth'
-                           THEN turns.flips END), 0) AS flips_smooth,
-              coalesce(max(CASE WHEN sharp.src = 'orig'
-                           THEN sharp.n_sharp END), 0) AS sharp_orig,
-              coalesce(max(CASE WHEN sharp.src = 'smooth'
-                           THEN sharp.n_sharp END), 0)
-                AS sharp_smooth,
-              CAST(CASE WHEN coalesce(max(CASE WHEN sharp.src =
-                             'smooth' THEN sharp.n_sharp END), 0)
-                          < coalesce(max(CASE WHEN sharp.src =
-                             'orig' THEN sharp.n_sharp END), 0)
-                   THEN 1 ELSE 0 END AS BIGINT) AS smoothed
-       FROM stats CROSS JOIN turns CROSS JOIN sharp
-       GROUP BY stats.n_vertices, stats.checksum, stats.min_x,
-                stats.max_x"""
-
-
-@query("q528_chaikin_smoothing", _q528_sql("//"))
-def q528(spark, sf_dir):
-    """Chaikin corner-cutting smoothing (Chaikin 1974) — the line
-    generalization dual of q111's Douglas-Peucker (DP removes
-    vertices, Chaikin ADDS them to round corners; both ship in every
-    cartography stack): each round replaces every edge with its
-    1/4 and 3/4 points and keeps the endpoints, and the arithmetic
-    stays EXACT by scaling coordinates x4 per round (Q = 3P_i +
-    P_{i+1}, R = P_i + 3P_{i+1} — integers forever, the dyadic-
-    weight rule; two rounds = x16 coordinates).  The index algebra
-    is pinned: P_0 -> 0, Q_i -> 2i+1, R_i -> 2i+2, P_last ->
-    2m-1, so the vertex count exactly doubles per round (12 -> 24
-    -> 48) and the output carries the q63 order-sensitive checksum.
-    The smoothing CLAIM is audited, not asserted, and on the
-    RIGHT quantity: the sawtooth base has 10 SHARP corners
-    (consecutive-edge integer dot product < 0, turns over 90
-    degrees) and one Chaikin round provably rounds every one of
-    them off (10 -> 0) while the direction-flip count — sign
-    changes of consecutive cross products — is PRESERVED at 9 on
-    both curves: corner cutting softens angles, it never reorders
-    the turning sequence (the first cut compared flips and found
-    4 == 4, a vacuous audit; both counts now ride the output).
-    Pure index self-joins, no geometry kernels."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q528_documents")
-    return spark.sql(_q528_sql("div", "q528_documents"))
-
-
-# --- STR packing, axis-order audit, MVCC visibility (q529-q531) -------------------------
-
-
-def _q529_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH r AS (SELECT doc_id % 128 AS i,
-                      (doc_id % 128)*37 % 96 AS cx,
-                      (doc_id % 128)*59 % 84 AS cy,
-                      2 + ((doc_id % 128)*7) % 4 AS w,
-                      2 + ((doc_id % 128)*11) % 4 AS h
-               FROM (SELECT DISTINCT doc_id % 128 AS doc_id
-                     FROM {tbl}) dd),
-       rx AS (SELECT r.*,
-                     row_number() OVER (ORDER BY cx, i) - 1 AS ox
-              FROM r),
-       sl AS (SELECT rx.*,
-                     CASE WHEN ox < 48 THEN 0
-                          WHEN ox < 96 THEN 1 ELSE 2 END AS slice
-              FROM rx),
-       ry AS (SELECT sl.*,
-                     row_number() OVER (PARTITION BY slice
-                       ORDER BY cy, i) - 1 AS oy
-              FROM sl),
-       asg AS (SELECT i, cx, cy, w, h,
-                      slice * 3 + oy {divop} 16 AS leaf_str,
-                      i {divop} 16 AS leaf_naive
-               FROM ry),
-       leaves AS (SELECT 'str' AS method, leaf_str AS leaf,
-                         CAST(min(cx) AS BIGINT) AS x0,
-                         CAST(min(cy) AS BIGINT) AS y0,
-                         CAST(max(cx + w) AS BIGINT) AS x1,
-                         CAST(max(cy + h) AS BIGINT) AS y1
-                  FROM asg GROUP BY leaf_str
-                  UNION ALL
-                  SELECT 'naive', leaf_naive,
-                         CAST(min(cx) AS BIGINT),
-                         CAST(min(cy) AS BIGINT),
-                         CAST(max(cx + w) AS BIGINT),
-                         CAST(max(cy + h) AS BIGINT)
-                  FROM asg GROUP BY leaf_naive),
-       agg AS (SELECT method,
-                      CAST(count(*) AS BIGINT) AS n_leaves,
-                      CAST(sum((x1-x0)*(y1-y0)) AS BIGINT)
-                        AS total_mbr_area
-               FROM leaves GROUP BY method),
-       ov AS (SELECT a.method,
-                     CAST(sum(greatest(0, least(a.x1, b.x1)
-                                          - greatest(a.x0, b.x0))
-                              * greatest(0, least(a.y1, b.y1)
-                                            - greatest(a.y0, b.y0)))
-                          AS BIGINT) AS total_overlap
-              FROM leaves a JOIN leaves b
-                ON b.method = a.method AND b.leaf > a.leaf
-              GROUP BY a.method)
-       SELECT agg.method, agg.n_leaves, agg.total_mbr_area,
-              coalesce(ov.total_overlap, 0) AS total_overlap,
-              CAST((SELECT CASE WHEN s.total_overlap
-                                     < n.total_overlap
-                           THEN 1 ELSE 0 END
-                    FROM ov s, ov n
-                    WHERE s.method = 'str' AND n.method = 'naive')
-                   AS BIGINT) AS str_wins
-       FROM agg LEFT JOIN ov ON ov.method = agg.method"""
-
-
-@query("q529_str_rtree_packing", _q529_sql("//"))
-def q529(spark, sf_dir):
-    """Sort-Tile-Recursive R-tree bulk loading (Leutenegger 1997 —
-    how libspatialindex/GeoPackage pack a static R-tree; the
-    packing-quality dual of q30/q89's Hilbert sort): 128 rectangles
-    into 8 leaves of 16 by x-sorted slices then y-sorted runs
-    (ranks pinned by (coord, id)), against insertion-order packing
-    as the control.  Leaf quality is measured in exact integers —
-    total MBR area and total pairwise MBR overlap via
-    greatest/least clamp arithmetic — and the gap is the entire
-    reason bulk loading exists: 8532 vs 60100 area and 435 vs
-    196341 overlap (451x): every query rectangle that hits
-    overlapping leaf MBRs must descend into BOTH, so leaf overlap
-    IS the expected fan-out of the index at query time — the
-    row-group-skipping story (q30, q384) at the index level.  Two
-    window ranks + one 8x8 MBR join; str_wins decided on exact
-    integers."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q529_documents")
-    return spark.sql(_q529_sql("div", "q529_documents"))
-
-
-def _q530_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH pts AS (
-         SELECT doc_id,
-                CASE doc_id % 3 WHEN 0 THEN 'feed_lonlat'
-                     WHEN 1 THEN 'feed_latlon'
-                     ELSE 'feed_regional' END AS src,
-                CASE doc_id % 3
-                     WHEN 0 THEN (doc_id*73) % 358 - 179
-                     WHEN 1 THEN (doc_id*47) % 160 - 80
-                     ELSE (doc_id*31) % 90 - 45 END AS c1,
-                CASE doc_id % 3
-                     WHEN 0 THEN (doc_id*47) % 160 - 80
-                     WHEN 1 THEN (doc_id*73) % 358 - 179
-                     ELSE (doc_id*53) % 90 - 45 END AS c2
-         FROM {tbl}),
-       cls AS (SELECT doc_id, src, c1, c2,
-                      CASE WHEN abs(c2) > 90 THEN 'swapped'
-                           WHEN abs(c1) > 90 THEN 'ok'
-                           ELSE 'ambiguous' END AS verdict
-               FROM pts),
-       fixed AS (SELECT src,
-                        CASE WHEN abs(c2) > 90 THEN c2 ELSE c1 END
-                          AS lon,
-                        CASE WHEN abs(c2) > 90 THEN c1 ELSE c2 END
-                          AS lat
-                 FROM cls),
-       sane AS (SELECT src AS ss,
-                       CAST(sum(CASE WHEN abs(lat) > 90
-                                THEN 1 ELSE 0 END) AS BIGINT)
-                         AS bad_lat_after_fix
-                FROM fixed GROUP BY src)
-       SELECT cls.src, cls.verdict,
-              CAST(count(*) AS BIGINT) AS n_pts,
-              CAST(min(cls.c1) AS BIGINT) AS min_c1,
-              CAST(max(cls.c1) AS BIGINT) AS max_c1,
-              sane.bad_lat_after_fix
-       FROM cls JOIN sane ON sane.ss = cls.src
-       GROUP BY cls.src, cls.verdict, sane.bad_lat_after_fix"""
-
-
-@query("q530_axis_order_audit", _q530_sql("//"))
-def q530(spark, sf_dir):
-    """Coordinate axis-order audit — GDAL's most famous real-world
-    trap in miniature (EPSG:4326 declares lat,lon; every GIS file
-    ever written uses lon,lat; GDAL ships
-    OAMS_TRADITIONAL_GIS_ORDER to paper over it): three ingest
-    feeds, one correct lon-lat, one latitude-first, one regional
-    (all coords within +-45).  Per point the only sound inference
-    is the range test — |c2| > 90 proves c2 is a longitude
-    (swapped), |c1| > 90 proves the order is fine, both within 90
-    is AMBIGUOUS — and the output shows the hard truth: the
-    swapped feed is only detectable on its ~50% of rows that
-    wander past the 90-degree line, the regional feed is 100%
-    undecidable row-by-row (metadata or source-level voting must
-    decide; a per-row fixer CANNOT — the honest negative result is
-    the point).  The repair applies the per-row rule and re-audits:
-    bad_lat_after_fix == 0 on every feed, so the fix never
-    manufactures an invalid latitude even where it must guess.
-    Pure integer range classification."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q530_documents")
-    return spark.sql(_q530_sql("div", "q530_documents"))
-
-
-def _q531_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH tx AS (SELECT event_id % 40 AS txid,
-                      CASE WHEN (event_id % 40) % 4 = 3
-                            AND ((event_id % 40) {divop} 4) % 3 = 0
-                           THEN 'aborted'
-                           WHEN (event_id % 40) % 4 = 3
-                            AND ((event_id % 40) {divop} 4) % 3 = 1
-                           THEN 'in_progress'
-                           ELSE 'committed' END AS state
-               FROM (SELECT DISTINCT event_id % 40 AS event_id
-                     FROM {tbl}) dd),
-       ver AS (SELECT k.kk AS key, v.vv AS vn,
-                      k.kk * 4 + v.vv AS xmin_t,
-                      CASE WHEN v.vv < 3 THEN k.kk * 4 + v.vv + 1
-                           ELSE NULL END AS xmax_t,
-                      k.kk * 100 + v.vv AS payload
-               FROM (SELECT DISTINCT event_id % 8 AS kk
-                     FROM {tbl}) k
-               CROSS JOIN (SELECT 0 AS vv UNION ALL SELECT 1
-                           UNION ALL SELECT 2 UNION ALL SELECT 3) v),
-       snaps AS (SELECT 10 AS snap UNION ALL SELECT 22
-                 UNION ALL SELECT 39),
-       vis AS (SELECT snaps.snap, ver.key, ver.vn, ver.payload,
-                      CASE WHEN txi.state = 'committed'
-                            AND ver.xmin_t < snaps.snap
-                            AND (ver.xmax_t IS NULL
-                                 OR NOT (txa.state = 'committed'
-                                         AND ver.xmax_t < snaps.snap))
-                           THEN 1 ELSE 0 END AS visible
-               FROM snaps CROSS JOIN ver
-               JOIN tx txi ON txi.txid = ver.xmin_t % 40
-               LEFT JOIN tx txa ON txa.txid = ver.xmax_t % 40),
-       dup AS (SELECT CAST(count(*) AS BIGINT) AS multi_visible
-               FROM (SELECT snap, key FROM vis WHERE visible = 1
-                     GROUP BY snap, key HAVING count(*) > 1) d)
-       SELECT vis.snap,
-              CAST(sum(vis.visible) AS BIGINT) AS n_visible,
-              CAST(sum(vis.visible * vis.payload) AS BIGINT)
-                AS payload_sum,
-              CAST(sum(CASE WHEN vis.visible = 1
-                       THEN vis.vn ELSE 0 END) AS BIGINT)
-                AS version_sum,
-              dup.multi_visible
-       FROM vis CROSS JOIN dup
-       GROUP BY vis.snap, dup.multi_visible"""
-
-
-@query("q531_mvcc_visibility", _q531_sql("//"))
-def q531(spark, sf_dir):
-    """MVCC snapshot visibility — the tuple-visibility rule every
-    versioned store evaluates on every read (Postgres xmin/xmax in
-    miniature; the transactional sibling of q255's point-in-time
-    and q419's OCC): a version is visible to a snapshot iff its
-    inserting transaction committed before the snapshot AND its
-    deleting transaction (if any) did NOT — where 'did not' folds
-    three cases (no deleter, deleter uncommitted/aborted, deleter
-    after the snapshot) into one NOT(committed AND before)
-    predicate.  8 keys x 4 chained versions (each version's xmax
-    IS the next version's xmin — a proper version chain), a
-    transaction table with committed / aborted / in-progress
-    states, and three snapshots straddling the chain.  The
-    integrity theorem rides in the output: at most ONE version of
-    a key is visible per snapshot (multi_visible == 0, computed by
-    a HAVING audit, never assumed) — and the theorem is a FIXTURE
-    constraint, not a formula: the first cut aborted mid-chain
-    transactions and scored multi_visible = 5, because a history
-    where txn T's insert survives while the SAME T's delete of the
-    predecessor is rolled back cannot happen in a real store —
-    non-committed transactions may only appear at chain TAILS
-    (keys 0/3/6 aborted, 1/4/7 in-progress), where they correctly
-    make the attempted delete invisible and the PREDECESSOR version
-    resurface.  Pure relational CASE evaluation over a broadcast
-    transaction table."""
-    _t(spark, sf_dir, "events") \
-        .createOrReplaceTempView("q531_events")
-    return spark.sql(_q531_sql("div", "q531_events"))
-
-
-# --- Allen's interval algebra (q532) ----------------------------------------------------
-
-
-def _q532_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH ids AS (SELECT DISTINCT event_id % 60 AS i
-               FROM {tbl}),
-       base AS (SELECT i, (i*37) % 200 AS s0,
-                       1 + (i*13) % 30 AS len0
-                FROM ids),
-       iv AS (SELECT b.i,
-                     CASE WHEN b.i % 15 = 7
-                          THEN ((b.i-7)*37) % 200
-                          WHEN b.i % 10 = 9
-                          THEN ((b.i-1)*37) % 200
-                               + 1 + ((b.i-1)*13) % 30
-                          WHEN b.i % 12 = 11
-                          THEN ((b.i-11)*37) % 200
-                               + 1 + ((b.i-11)*13) % 30 - b.len0
-                          ELSE b.s0 END AS s,
-                     CASE WHEN b.i % 15 = 7
-                          THEN 1 + ((b.i-7)*13) % 30
-                          ELSE b.len0 END AS len
-              FROM base b),
-       iv2 AS (SELECT i, s, s + len AS e FROM iv),
-       rel AS (SELECT a.i AS ia, b.i AS ib,
-                      CASE
-                        WHEN a.e < b.s THEN 'before'
-                        WHEN a.e = b.s THEN 'meets'
-                        WHEN b.e < a.s THEN 'after'
-                        WHEN b.e = a.s THEN 'met_by'
-                        WHEN a.s = b.s AND a.e = b.e THEN 'equals'
-                        WHEN a.s = b.s AND a.e < b.e THEN 'starts'
-                        WHEN a.s = b.s THEN 'started_by'
-                        WHEN a.e = b.e AND a.s > b.s THEN 'finishes'
-                        WHEN a.e = b.e THEN 'finished_by'
-                        WHEN a.s > b.s AND a.e < b.e THEN 'during'
-                        WHEN a.s < b.s AND a.e > b.e THEN 'contains'
-                        WHEN a.s < b.s THEN 'overlaps'
-                        ELSE 'overlapped_by' END AS rel
-               FROM iv2 a JOIN iv2 b ON b.i > a.i),
-       agg AS (SELECT rel, CAST(count(*) AS BIGINT) AS n_pairs
-               FROM rel GROUP BY rel),
-       tot AS (SELECT CAST(sum(n_pairs) AS BIGINT) AS total,
-                      CAST(count(*) AS BIGINT) AS n_relations
-               FROM agg),
-       n AS (SELECT CAST(count(*) AS BIGINT) AS n_iv FROM iv2)
-       SELECT agg.rel, agg.n_pairs, tot.n_relations,
-              CAST(tot.total
-                   - n.n_iv * (n.n_iv - 1) {divop} 2 AS BIGINT)
-                AS partition_resid
-       FROM agg CROSS JOIN tot CROSS JOIN n"""
-
-
-@query("q532_allen_interval_algebra", _q532_sql("//"))
-def q532(spark, sf_dir):
-    """Allen's interval algebra (Allen 1983) — the 13 mutually
-    exclusive, jointly exhaustive temporal relations every
-    interval-join optimizer reasons with (before/meets/overlaps/
-    starts/during/finishes + inverses + equals), classified by a
-    PINNED cascade of exact integer endpoint comparisons whose
-    order encodes the precedence (equality tests BEFORE the open
-    cases, so 'meets' never leaks into 'before' and 'starts' never
-    into 'overlaps' — the boundary cases are the whole algebra).
-    The JEPD property is the emitted proof: every one of the
-    C(60,2) = 1770 ordered pairs lands in exactly one relation, so
-    the counts sum to the pair total (partition_resid == 0 on
-    every row) and n_relations counts how many of the 13 the
-    fixture realizes.  Boundary relations don't happen by luck at
-    integer density — they are PLANTED by construction: every
-    15th interval duplicates an earlier one (equals), every 10th
-    starts exactly at its predecessor's endpoint (meets/met_by),
-    every 12th is built to share an endpoint (finishes family).
-    One pair self-join over a 60-row broadcast interval dim."""
-    _t(spark, sf_dir, "events") \
-        .createOrReplaceTempView("q532_events")
-    return spark.sql(_q532_sql("div", "q532_events"))
-
-
-# --- V-optimal histogram + Kalman filter (q533-q534) ------------------------------------
-
-
-def _q533_sql(divop: str, mat: str, tbl: str = "events") -> str:
-    sse = ("(CAST({b}.s2 - {a}s2 AS DOUBLE)"
-           " - CAST(({b}.s1 - {a}s1) * ({b}.s1 - {a}s1) AS DOUBLE)"
-           " / CAST({b}.i - {a}i AS DOUBLE))")
-    stages = []
-    for k in (2, 3, 4):
-        cost = (f"dp{k-1}.cost + " + sse.format(b="pi", a="pj."))
-        stages.append(f"""dp{k} AS{mat} (
-         SELECT pi.i, min({cost}) AS cost
-         FROM pf pi
-         JOIN dp{k-1} ON dp{k-1}.i < pi.i AND dp{k-1}.i >= {k-1}
-         JOIN pf pj ON pj.i = dp{k-1}.i
-         GROUP BY pi.i),
-       b{k} AS{mat} (
-         SELECT pi.i, CAST(min(dp{k-1}.i) AS BIGINT) AS bj
-         FROM pf pi
-         JOIN dp{k} ON dp{k}.i = pi.i
-         JOIN dp{k-1} ON dp{k-1}.i < pi.i AND dp{k-1}.i >= {k-1}
-         JOIN pf pj ON pj.i = dp{k-1}.i
-         WHERE {cost} = dp{k}.cost
-         GROUP BY pi.i)""")
-    chain = ",\n       ".join(stages)
-    ew = " + ".join(
-        sse.format(b=f"e{hi}", a=f"e{lo}.") for lo, hi in
-        ((0, 6), (6, 12), (12, 18), (18, 24)))
-    return f"""WITH ids AS (SELECT DISTINCT event_id % 24 + 1 AS i
-               FROM {tbl}),
-       vals AS (SELECT i,
-                       10 * (CASE WHEN i <= 4 THEN 0
-                                  WHEN i <= 12 THEN 1
-                                  WHEN i <= 19 THEN 2
-                                  ELSE 3 END)
-                         + (i*7) % 3 AS v
-                FROM ids),
-       pf AS{mat} (
-         SELECT i,
-                CAST(sum(v) OVER (ORDER BY i) AS BIGINT) AS s1,
-                CAST(sum(v*v) OVER (ORDER BY i) AS BIGINT) AS s2
-         FROM vals),
-       pf0 AS{mat} (
-         SELECT i, s1, s2 FROM pf
-         UNION ALL SELECT 0, 0, 0),
-       dp1 AS{mat} (
-         SELECT pi.i,
-                CAST(pi.s2 AS DOUBLE)
-                  - CAST(pi.s1 * pi.s1 AS DOUBLE)
-                    / CAST(pi.i AS DOUBLE) AS cost
-         FROM pf pi),
-       {chain},
-       splits AS (SELECT b4.bj AS j3, b3.bj AS j2, b2.bj AS j1
-                  FROM b4 JOIN b3 ON b3.i = b4.bj
-                  JOIN b2 ON b2.i = b3.bj
-                  WHERE b4.i = 24),
-       ewc AS (SELECT {ew} AS ew_sse
-               FROM pf0 e0, pf0 e6, pf0 e12, pf0 e18, pf0 e24
-               WHERE e0.i = 0 AND e6.i = 6 AND e12.i = 12
-                 AND e18.i = 18 AND e24.i = 24)
-       SELECT splits.j1, splits.j2, splits.j3,
-              dp4.cost AS vopt_sse, ewc.ew_sse,
-              CAST(CASE WHEN splits.j1 = 4 AND splits.j2 = 12
-                         AND splits.j3 = 19
-                   THEN 1 ELSE 0 END AS BIGINT) AS found_levels,
-              CAST(CASE WHEN dp4.cost < ewc.ew_sse
-                   THEN 1 ELSE 0 END AS BIGINT) AS vopt_wins
-       FROM splits CROSS JOIN ewc
-       JOIN dp4 ON dp4.i = 24"""
-
-
-@query("q533_voptimal_histogram", _q533_sql("//", " MATERIALIZED"))
-def q533(spark, sf_dir):
-    """V-optimal histogram construction (Jagadish 1998 — the
-    SSE-minimizing bucketing query optimizers aspire to; q398's
-    equi-depth and q384's zone maps are the cheap cousins): dynamic
-    program dp_k(i) = min_j dp_{k-1}(j) + SSE(j+1..i) over prefix
-    sums, k = 4 buckets over 24 values with PLANTED level shifts of
-    UNEQUAL widths 4/8/7/5 — equal widths would let equi-width tie
-    and the vopt_wins contrast would be vacuous (the q508 arena
-    lesson).  SSE is computed from exact BIGINT prefix sums with
-    ONE division per (j, i) candidate; dp costs are doubles from
-    identical expression trees on both engines, argmin split
-    points are recovered two-phase (min cost, then min j at that
-    cost — float equality on identical bits) and back-chained j3
-    -> j2 -> j1, landing EXACTLY on the planted boundaries
-    (4, 12, 19; found_levels == 1).  Three unrolled DP stages,
-    each one (i x j) triangular join over a 24-row dim —
-    O(k n^2) like the paper, all broadcast-scale."""
-    _t(spark, sf_dir, "events") \
-        .createOrReplaceTempView("q533_events")
-    return spark.sql(_q533_sql("div", "", "q533_events"))
-
-
-def _q534_sql(divop: str, mat: str, tbl: str = "events") -> str:
-    stages = []
-    for t in range(1, 8):
-        stages.append(f"""k{t} AS{mat} (
-         SELECT s.g,
-                s.pos + s.vel
-                  + (s.p00 + 2*s.p01 + s.p11 + 1e-2)
-                    / (s.p00 + 2*s.p01 + s.p11 + 1e-2 + 4e0)
-                    * (z.z - (s.pos + s.vel)) AS pos,
-                s.vel
-                  + (s.p01 + s.p11)
-                    / (s.p00 + 2*s.p01 + s.p11 + 1e-2 + 4e0)
-                    * (z.z - (s.pos + s.vel)) AS vel,
-                (1e0 - (s.p00 + 2*s.p01 + s.p11 + 1e-2)
-                       / (s.p00 + 2*s.p01 + s.p11 + 1e-2 + 4e0))
-                  * (s.p00 + 2*s.p01 + s.p11 + 1e-2) AS p00,
-                (1e0 - (s.p00 + 2*s.p01 + s.p11 + 1e-2)
-                       / (s.p00 + 2*s.p01 + s.p11 + 1e-2 + 4e0))
-                  * (s.p01 + s.p11) AS p01,
-                (s.p11 + 1e-2)
-                  - (s.p01 + s.p11)
-                    / (s.p00 + 2*s.p01 + s.p11 + 1e-2 + 4e0)
-                    * (s.p01 + s.p11) AS p11,
-                s.sse_f
-                  + (s.pos + s.vel
-                     + (s.p00 + 2*s.p01 + s.p11 + 1e-2)
-                       / (s.p00 + 2*s.p01 + s.p11 + 1e-2 + 4e0)
-                       * (z.z - (s.pos + s.vel))
-                     - 5e0*{t})
-                    * (s.pos + s.vel
-                       + (s.p00 + 2*s.p01 + s.p11 + 1e-2)
-                         / (s.p00 + 2*s.p01 + s.p11 + 1e-2 + 4e0)
-                         * (z.z - (s.pos + s.vel))
-                       - 5e0*{t}) AS sse_f,
-                s.sse_r + (z.z - 5e0*{t}) * (z.z - 5e0*{t}) AS sse_r
-         FROM k{t-1} s JOIN pts z ON z.g = s.g AND z.t = {t})""")
-    chain = ",\n       ".join(stages)
-    return f"""WITH tracks AS (SELECT DISTINCT event_id % 10 AS g
-               FROM {tbl}),
-       tt AS (SELECT 0 AS t UNION ALL SELECT 1 UNION ALL SELECT 2
-              UNION ALL SELECT 3 UNION ALL SELECT 4 UNION ALL
-              SELECT 5 UNION ALL SELECT 6 UNION ALL SELECT 7),
-       pts AS{mat} (
-         SELECT g, t,
-                CAST(5*t + (g*3 + t*7) % 5 - 2 AS DOUBLE) AS z
-         FROM tracks CROSS JOIN tt),
-       k0 AS{mat} (
-         SELECT g, z AS pos, 0e0 AS vel,
-                4e0 AS p00, 0e0 AS p01, 9e0 AS p11,
-                z * 0e0 AS sse_f, z * 0e0 AS sse_r
-         FROM pts WHERE t = 0),
-       {chain}
-       SELECT g AS track_id, pos AS pos_final, vel AS vel_final,
-              sse_f, sse_r,
-              CAST(CASE WHEN sse_f < sse_r THEN 1 ELSE 0 END
-                   AS BIGINT) AS kalman_wins,
-              CAST(CASE WHEN vel > 4e0 AND vel < 6e0
-                   THEN 1 ELSE 0 END AS BIGINT) AS vel_converged
-       FROM k7"""
-
-
-@query("q534_kalman_filter", _q534_sql("//", " MATERIALIZED"))
-def q534(spark, sf_dir):
-    """1-D constant-velocity Kalman filter (Kalman 1960 — the
-    trajectory smoother upstream of q522's map matcher: snap AFTER
-    you filter) unrolled over 7 measurement updates for 10 tracks:
-    predict folds into update so each stage is pure arithmetic in
-    (pos, vel, p00, p01, p11) — the innovation gain k0 =
-    P'00/(P'00 + R) appears four times per stage and is written
-    VERBATIM each time so both engines build the identical IEEE
-    expression tree (the q73 rule: never factor through an
-    intermediate the other engine won't see; doubles equal bitwise,
-    one shared SQL text).  Truth is the exact line 5t with planted
-    +-2 hash noise; both SSE accumulators ride the stage chain in
-    FIXED order (never a float SUM over an unordered group — the
-    q179 lesson), and the output audits the filter's reason to
-    exist: kalman_wins (filtered SSE < raw SSE) and vel_converged
-    (terminal velocity within 4..6 from a 0 prior) on every track.
-    Linear 7-stage chain, 10 rows per stage."""
-    _t(spark, sf_dir, "events") \
-        .createOrReplaceTempView("q534_events")
-    return spark.sql(_q534_sql("div", "", "q534_events"))
-
-
-# --- Spatial scan, interval stabbing, PPS sampling (q535-q537) --------------------------
-
-
-def _q535_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH pts AS (
-         SELECT doc_id,
-                CASE WHEN doc_id % 25 = 3
-                     THEN 27 + (doc_id {divop} 25) % 7
-                     ELSE (doc_id*41) % 96 END AS x,
-                CASE WHEN doc_id % 25 = 3
-                     THEN 37 + ((doc_id {divop} 25)*3) % 7
-                     ELSE (doc_id*67) % 84 END AS y,
-                CASE WHEN doc_id % 25 = 3 OR doc_id % 17 = 0
-                     THEN 1 ELSE 0 END AS is_case
-         FROM {tbl}),
-       tot AS (SELECT CAST(count(*) AS BIGINT) AS pt,
-                      CAST(sum(is_case) AS BIGINT) AS ct
-               FROM pts),
-       d12 AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2
-               UNION ALL SELECT 3 UNION ALL SELECT 4 UNION ALL
-               SELECT 5 UNION ALL SELECT 6 UNION ALL SELECT 7
-               UNION ALL SELECT 8 UNION ALL SELECT 9 UNION ALL
-               SELECT 10 UNION ALL SELECT 11),
-       win AS (SELECT 8*a.i + 4 AS cx, 8*b.i + 4 AS cy, r.r
-               FROM d12 a JOIN d12 b ON b.i < 10
-               CROSS JOIN (SELECT 4 AS r UNION ALL SELECT 8) r),
-       cnt AS (SELECT win.cx, win.cy, win.r,
-                      CAST(count(*) AS BIGINT) AS p_w,
-                      CAST(sum(pts.is_case) AS BIGINT) AS c_w
-               FROM win JOIN pts
-                 ON (pts.x - win.cx)*(pts.x - win.cx)
-                    + (pts.y - win.cy)*(pts.y - win.cy)
-                    <= win.r * win.r
-               GROUP BY win.cx, win.cy, win.r),
-       scored AS (SELECT cnt.cx, cnt.cy, cnt.r, cnt.p_w, cnt.c_w,
-                         CAST(cnt.c_w * tot.pt
-                              - cnt.p_w * tot.ct AS BIGINT)
-                           AS excess,
-                         row_number() OVER (
-                           ORDER BY cnt.c_w * tot.pt
-                                    - cnt.p_w * tot.ct DESC,
-                                    cnt.cx, cnt.cy, cnt.r) AS rnk
-                  FROM cnt CROSS JOIN tot)
-       SELECT CAST(rnk AS BIGINT) AS rnk, cx, cy, r, p_w, c_w, excess
-       FROM scored WHERE rnk <= 3"""
-
-
-@query("q535_spatial_scan", _q535_sql("//"))
-def q535(spark, sf_dir):
-    """Spatial scan statistic — Kulldorff's outbreak detector in its
-    exact-excess form (SaTScan's core loop; the window-sweep
-    companion to q503's lattice-local Gi*): sweep 240 candidate
-    circles (120 grid centers x radii 4/8) over a case/population
-    point field and rank by the EXCESS cross-product c_w*P - p_w*C
-    — the sign of (case rate inside) vs (overall rate) cleared of
-    all divisions, so the ranking needs no likelihood, no log, no
-    float (Kulldorff's LLR is monotone in this excess at fixed
-    window population; top-3 emitted with ties pinned by center
-    key).  The planted outbreak RELOCATES every 25th doc into a
-    7x7 patch — the first cut merely flagged in-place points and
-    the background's 29 scattered cases diluted the top window to
-    4 (the plant must dominate its own window, the q508 lesson);
-    now the winning circle holds 21 of 49 cases at excess 9177,
-    ~2x the runner-up outside the patch.  ENGINE: the 240-window
-    dim is broadcast against the point table — one pass, no point
-    shuffle; the per-window counts are the q12 zonal shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q535_documents")
-    return spark.sql(_q535_sql("div", "q535_documents"))
-
-
-def _q536_sql(divop: str, tbl: str = "events") -> str:
-    return f"""WITH iv AS (SELECT event_id % 200 AS i,
-                      (event_id % 200)*37 % 500 AS s,
-                      (event_id % 200)*37 % 500
-                        + 5 + ((event_id % 200)*13) % 60 AS e
-               FROM (SELECT DISTINCT event_id % 200 AS event_id
-                     FROM {tbl}) dd),
-       probes AS (SELECT 40*(k+1) - 17 AS q
-                  FROM (SELECT 0 AS k UNION ALL SELECT 1 UNION ALL
-                        SELECT 2 UNION ALL SELECT 3 UNION ALL
-                        SELECT 4 UNION ALL SELECT 5 UNION ALL
-                        SELECT 6 UNION ALL SELECT 7 UNION ALL
-                        SELECT 8 UNION ALL SELECT 9 UNION ALL
-                        SELECT 10 UNION ALL SELECT 11) kk),
-       stab AS (SELECT probes.q,
-                       CAST(sum(CASE WHEN iv.s <= probes.q
-                                      AND iv.e > probes.q
-                                THEN 1 ELSE 0 END) AS BIGINT)
-                         AS n_stabbed
-                FROM probes CROSS JOIN iv GROUP BY probes.q)
-       SELECT q, n_stabbed FROM stab"""
-
-
-@query("q536_interval_stabbing", _q536_sql("//"))
-def q536(spark, sf_dir):
-    """Interval stabbing by endpoint sweep — the optimizer identity
-    stab(q) = #(starts <= q) - #(ends <= q) for half-open [s, e)
-    intervals, which turns an O(n x q) containment join into two
-    sorted-prefix lookups (the zonemap/BRIN mental model applied to
-    time): the ENGINE materializes cumulative endpoint counts once
-    (two 200-row rank tables) and answers each probe with two
-    as-of max-rank lookups carried on ONE packed key value*1024 +
-    rank (the q517 encoding rule: max of packed = rank at the
-    largest value <= q, because rank is monotone in value within
-    the pack) — per-probe cost is a broadcast lookup, not an
-    interval scan; the ORACLE replays the naive containment join,
-    and the identity makes them equal row-for-row on all 12
-    probes.  Probes are offset (-17 mod 40) so several land
-    exactly ON interval endpoints: the half-open convention
-    (s <= q < e) is exercised at the boundary, not just stated."""
-    _t(spark, sf_dir, "events") \
-        .createOrReplaceTempView("q536_events")
-    iv = spark.sql(
-        """SELECT i, s, e FROM (
-             SELECT event_id % 200 AS i,
-                    (event_id % 200)*37 % 500 AS s,
-                    (event_id % 200)*37 % 500
-                      + 5 + ((event_id % 200)*13) % 60 AS e
-             FROM (SELECT DISTINCT event_id % 200 AS event_id
-                   FROM q536_events) dd) t""").localCheckpoint()
-    probes = spark.range(12).select(
-        (40 * (F.col("id") + 1) - 17).cast("int").alias("q"))
-
-    def cum(col):
-        w = Window.orderBy(col)
-        return (iv.groupBy(F.col(col).alias("v"))
-                .agg(F.count("*").alias("c"))
-                .withColumn("cum", F.sum("c").over(
-                    Window.orderBy("v")
-                    .rowsBetween(Window.unboundedPreceding, 0)))
-                .select("v", "cum"))
-
-    sc, ec = cum("s"), cum("e")
-
-    def lookup(cumdf, name):
-        # as-of max: rank at the largest v <= q, packed v*1024+cum
-        j = (probes.join(F.broadcast(cumdf), cumdf["v"] <= probes["q"],
-                         "left")
-             .groupBy("q")
-             .agg(F.coalesce(
-                 F.max(F.col("v") * 1024 + F.col("cum")) % 1024,
-                 F.lit(0)).alias(name)))
-        return j
-
-    out = (lookup(sc, "n_starts").join(lookup(ec, "n_ends"), "q")
-           .select("q", (F.col("n_starts") - F.col("n_ends"))
-                   .cast("long").alias("n_stabbed")))
-    return out
-
-
-def _q537_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH hosts AS (SELECT doc_id % 40 AS h,
-                      1 + (doc_id % 40)*7 % 25 AS w
-               FROM (SELECT DISTINCT doc_id % 40 AS doc_id
-                     FROM {tbl}) dd),
-       cum AS (SELECT h, w,
-                      CAST(sum(w) OVER (ORDER BY h) AS BIGINT)
-                        AS c_hi,
-                      CAST(sum(w) OVER (ORDER BY h) - w AS BIGINT)
-                        AS c_lo
-               FROM hosts),
-       tot AS (SELECT CAST(sum(w) AS BIGINT) AS bigw FROM hosts),
-       draws AS (SELECT k FROM (SELECT 0 AS k UNION ALL SELECT 1
-                 UNION ALL SELECT 2 UNION ALL SELECT 3 UNION ALL
-                 SELECT 4 UNION ALL SELECT 5 UNION ALL SELECT 6
-                 UNION ALL SELECT 7 UNION ALL SELECT 8
-                 UNION ALL SELECT 9) kk),
-       sel AS (SELECT cum.h,
-                      CAST(count(draws.k) AS BIGINT) AS n_sel
-               FROM cum CROSS JOIN tot
-               LEFT JOIN draws
-                 ON 20 * cum.c_lo <= (2*draws.k + 1) * tot.bigw
-                AND (2*draws.k + 1) * tot.bigw < 20 * cum.c_hi
-               GROUP BY cum.h)
-       SELECT hosts.h AS host, hosts.w,
-              sel.n_sel,
-              CAST(10 * hosts.w AS DOUBLE) / CAST(tot.bigw AS DOUBLE)
-                AS expected,
-              CAST(CASE WHEN sel.n_sel = (10 * hosts.w) {divop}
-                             tot.bigw
-                         OR sel.n_sel = (10 * hosts.w) {divop}
-                             tot.bigw + 1
-                   THEN 1 ELSE 0 END AS BIGINT) AS within_one,
-              CAST((SELECT sum(s2.n_sel) FROM sel s2) - 10
-                   AS BIGINT) AS total_resid
-       FROM hosts JOIN sel ON sel.h = hosts.h CROSS JOIN tot"""
-
-
-@query("q537_systematic_pps", _q537_sql("//"))
-def q537(spark, sf_dir):
-    """Systematic probability-proportional-to-size sampling — the
-    crawl-budget allocator (pick 10 of 40 hosts with probability
-    proportional to weight; Madow 1949, the method behind every
-    'sample shards by size' job): draw positions are the midpoints
-    (2k+1)*W/(2m) on the cumulative-weight line, and host h wins
-    draw k iff c_lo(h) <= pos_k < c_hi(h) — cleared of the
-    division, 2m*c_lo <= (2k+1)*W < 2m*c_hi, EXACT integers
-    throughout (no float position ever exists, so no boundary draw
-    can be mis-assigned).  Systematic PPS's defining theorem rides
-    per row: every host's selection count is floor or ceil of its
-    expectation m*w/W (within_one == 1 on all 40 rows — the
-    zero-variance-rounding property simple multinomial sampling
-    lacks) and the counts sum to exactly m (total_resid == 0).
-    Two window cumsums + a broadcast 10-row draw join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q537_documents")
-    return spark.sql(_q537_sql("div", "q537_documents"))
-
-
-# --- Union-of-rectangles + antialiased coverage (q538-q539) -----------------------------
-
-
-def _q538_oracle() -> str:
-    # brute-force half-open pixel count — DuckDB-only (range TVF)
-    return """WITH r AS (SELECT doc_id % 60 AS i,
-                     (doc_id % 60)*37 % 80 AS x0,
-                     (doc_id % 60)*59 % 70 AS y0,
-                     (doc_id % 60)*37 % 80 + 4
-                       + ((doc_id % 60)*7) % 12 AS x1,
-                     (doc_id % 60)*59 % 70 + 3
-                       + ((doc_id % 60)*11) % 10 AS y1
-              FROM (SELECT DISTINCT doc_id % 60 AS doc_id
-                    FROM documents) dd),
-       px AS (SELECT gx.range AS gx, gy.range AS gy
-              FROM range(96) gx, range(84) gy),
-       cov AS (SELECT DISTINCT px.gx, px.gy
-               FROM px JOIN r
-                 ON px.gx >= r.x0 AND px.gx < r.x1
-                AND px.gy >= r.y0 AND px.gy < r.y1)
-       SELECT CAST((SELECT count(*) FROM cov) AS BIGINT)
-                AS union_area,
-              CAST((SELECT count(*) FROM r) AS BIGINT) AS n_rects,
-              CAST((SELECT sum((x1-x0)*(y1-y0)) FROM r) AS BIGINT)
-                AS sum_rect_area"""
-
-
-@query("q538_union_of_rectangles", _q538_oracle())
-def q538(spark, sf_dir):
-    """Union-of-rectangles area (Bentley 1977 — the measure problem;
-    what a tile-coverage or burned-area accountant computes when
-    footprints overlap): 60 integer half-open rectangles whose
-    summed area (5698) far exceeds the union (the overlap IS the
-    point — sum_rect_area rides along as the naive-accounting
-    control).  ENGINE: the classical coordinate-compression sweep,
-    relationally — distinct x endpoints cut the plane into slabs,
-    each slab joins the rectangles spanning it, and the covered
-    y-length per slab is the interval-union computed by the ISLAND
-    pattern (order y-intervals, running max of ends via a window,
-    island starts where y0 exceeds the running max of prior ends —
-    no pairwise merge loop); area = sum over slabs of width *
-    covered_y, exact integers.  ORACLE: brute-force half-open
-    pixel counting over the 96x84 arena (a DuckDB range() lattice
-    — the two computations share NO structure, which is the
-    strongest kind of oracle).  The sweep is O(n^2 log n) worst
-    case vs the oracle's O(arena x n); at tile scale only the
-    sweep survives."""
-    docs = _t(spark, sf_dir, "documents")
-    r = (docs.select((F.col("doc_id") % 60).alias("i")).distinct()
-         .select("i", ((F.col("i") * 37) % 80).alias("x0"),
-                 ((F.col("i") * 59) % 70).alias("y0"),
-                 ((F.col("i") * 37) % 80 + 4 + (F.col("i") * 7) % 12)
-                 .alias("x1"),
-                 ((F.col("i") * 59) % 70 + 3 + (F.col("i") * 11) % 10)
-                 .alias("y1"))
-         .localCheckpoint())
-    xs = (r.select(F.col("x0").alias("x"))
-          .unionByName(r.select(F.col("x1").alias("x")))
-          .distinct())
-    w = Window.orderBy("x")
-    slabs = (xs.select("x", F.lead("x").over(w).alias("xn"))
-             .filter(F.col("xn").isNotNull())
-             .select(F.col("x").alias("sx"),
-                     (F.col("xn") - F.col("x")).alias("width")))
-    sr = slabs.join(r, (r["x0"] <= F.col("sx")) & (r["x1"] > F.col("sx")))
-    wy = (Window.partitionBy("sx")
-          .orderBy("y0", "y1")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    isl = (sr.select("sx", "width", "y0", "y1")
-           .withColumn("prev_max", F.max("y1").over(wy))
-           .withColumn("new_island",
-                       F.when(F.col("prev_max").isNull()
-                              | (F.col("y0") > F.col("prev_max")), 1)
-                       .otherwise(0))
-           .withColumn("island",
-                       F.sum("new_island").over(
-                           Window.partitionBy("sx")
-                           .orderBy("y0", "y1")
-                           .rowsBetween(Window.unboundedPreceding, 0))))
-    cov = (isl.groupBy("sx", "width", "island")
-           .agg(F.min("y0").alias("ys"), F.max("y1").alias("ye"))
-           .groupBy("sx", "width")
-           .agg(F.sum(F.col("ye") - F.col("ys")).alias("ylen")))
-    area = cov.select(F.sum(F.col("width") * F.col("ylen"))
-                      .alias("a")).collect()[0]["a"]
-    stats = r.agg(F.count("*").alias("n"),
-                  F.sum((F.col("x1") - F.col("x0"))
-                        * (F.col("y1") - F.col("y0"))).alias("s")) \
-             .collect()[0]
-    return spark.createDataFrame(
-        [(int(area), int(stats["n"]), int(stats["s"]))],
-        "union_area long, n_rects long, sum_rect_area long")
-
-
-def _q539_sql(divop: str, tbl: str = "documents") -> str:
-    # triangle (4,4) (92,24) (30,80), vertices scaled x4; subsample
-    # centers at 4*px + {0.5,1.5,2.5,3.5} -> scaled 16*px + {2,6,10,14}
-    return f"""WITH gxs AS (SELECT DISTINCT doc_id % 96 AS gx
-               FROM {tbl}),
-       gys AS (SELECT DISTINCT doc_id % 84 AS gy FROM {tbl}),
-       pxd AS (SELECT gxs.gx, gys.gy FROM gxs CROSS JOIN gys),
-       sub AS (SELECT 2 AS o UNION ALL SELECT 6 UNION ALL
-               SELECT 10 UNION ALL SELECT 14),
-       samp AS (SELECT pxd.gx, pxd.gy,
-                       16*pxd.gx + sx.o AS qx, 16*pxd.gy + sy.o AS qy
-                FROM pxd CROSS JOIN sub sx CROSS JOIN sub sy),
-       d AS (SELECT gx, gy,
-                    CASE WHEN 1408*(qy-64) - 320*(qx-64) >= 0
-                          AND (-992)*(qy-384) - 896*(qx-1472) >= 0
-                          AND (-416)*(qy-1280) + 1216*(qx-480) >= 0
-                         THEN 1 ELSE 0 END AS inside
-             FROM samp),
-       covpx AS (SELECT gx, gy,
-                        CAST(sum(inside) AS BIGINT) AS cov16
-                 FROM d GROUP BY gx, gy),
-       hist AS (SELECT cov16, CAST(count(*) AS BIGINT) AS n_pixels
-                FROM covpx GROUP BY cov16),
-       tot AS (SELECT CAST(sum(cov16) AS BIGINT) AS cov_total
-               FROM covpx)
-       SELECT hist.cov16, hist.n_pixels, tot.cov_total,
-              CAST(tot.cov_total - 49344 AS BIGINT)
-                AS area16_resid
-       FROM hist CROSS JOIN tot"""
-
-
-@query("q539_antialiased_coverage", _q539_sql("//"))
-def q539(spark, sf_dir):
-    """Anti-aliased rasterization coverage — the supersampling rule
-    (16x ordered grid, the classic AA mode) applied to a triangle,
-    where q25's scanline burn gives binary pixels: per pixel count
-    how many of the 4x4 subsample centers fall inside, an exact
-    integer coverage in sixteenths.  Everything is integer by
-    SCALING: vertices x4 and subsample centers at 16*px + {2, 6,
-    10, 14} (vertices x16 to match — the first cut scaled the
-    vertices x4 against x16 samples, a unit bug the design-time
-    ground truth caught) turn the three half-plane tests into pure
-    BIGINT cross products (the q74/q515 orientation rule — no
-    float ever touches an edge test, so no subsample can be
-    mis-classified by rounding).  The full 96x84 pixel grid is
-    GENERATED (cross join of the two derived coordinate sets — a
-    hashed pixel subset made the quadrature meaningless) and the
-    output is the coverage histogram with ALL SEVENTEEN levels
-    0/16..16/16 populated, plus the conservation column: for this
-    triangle and ordered grid the 16x quadrature is EXACT —
-    edge-band over- and under-counts cancel and summed coverage
-    equals 16 x the shoelace area (49344 = 16*3084), resid == 0.
-    Per-tile Column arithmetic at scale."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q539_documents")
-    return spark.sql(_q539_sql("div", "q539_documents"))
-
-
-# --- Bresenham closed form + integral image (q540-q541) ---------------------------------
-
-
-def _q540_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH lines AS (
-         SELECT i, 2 + i % 5 AS x0, 3 + (i*7) % 9 AS y0,
-                8 + (i*3) % 13 AS dx,
-                CASE WHEN i = 0 THEN 5
-                     ELSE (i*5) % (8 + (i*3) % 13) END AS dy
-         FROM (SELECT DISTINCT doc_id % 8 AS i FROM {tbl}) ii),
-       ks AS (SELECT a.i*10 + b.i AS k
-              FROM (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL
-                    SELECT 2) a
-              JOIN (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL
-                    SELECT 2 UNION ALL SELECT 3 UNION ALL SELECT 4
-                    UNION ALL SELECT 5 UNION ALL SELECT 6 UNION ALL
-                    SELECT 7 UNION ALL SELECT 8 UNION ALL
-                    SELECT 9) b ON 1=1),
-       px AS (SELECT lines.i, ks.k,
-                     lines.x0 + ks.k AS px,
-                     lines.y0 + (2*lines.dy*ks.k + lines.dx)
-                                {divop} (2*lines.dx) AS py,
-                     CASE WHEN (2*lines.dy*ks.k) % (2*lines.dx)
-                               = lines.dx
-                          THEN 1 ELSE 0 END AS is_tie,
-                     CASE WHEN (2*lines.dy*ks.k) % (2*lines.dx)
-                               = lines.dx
-                           AND ((2*lines.dy*ks.k) {divop}
-                                (2*lines.dx)) % 2 = 0
-                          THEN 1 ELSE 0 END AS banker_diff
-              FROM lines JOIN ks ON ks.k <= lines.dx),
-       steps AS (SELECT a.i,
-                        CAST(sum(CASE WHEN b.py - a.py NOT IN (0, 1)
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                          AS bad_steps
-                 FROM px a JOIN px b
-                   ON b.i = a.i AND b.k = a.k + 1
-                 GROUP BY a.i)
-       SELECT px.i AS line_id,
-              CAST(count(*) AS BIGINT) AS n_pixels,
-              CAST(count(*) - max(lines.dx) - 1 AS BIGINT)
-                AS count_resid,
-              CAST(sum(px.is_tie) AS BIGINT) AS n_ties,
-              CAST(sum(px.banker_diff) AS BIGINT) AS n_banker_diff,
-              CAST(sum((px.k + 1) * px.py) AS BIGINT) AS y_checksum,
-              steps.bad_steps,
-              CAST(max(CASE WHEN px.k = lines.dx
-                       THEN px.py - lines.y0 - lines.dy END)
-                   AS BIGINT) AS endpoint_resid
-       FROM px JOIN lines ON lines.i = px.i
-       JOIN steps ON steps.i = px.i
-       GROUP BY px.i, steps.bad_steps"""
-
-
-@query("q540_bresenham_closed_form", _q540_sql("//"))
-def q540(spark, sf_dir):
-    """Bresenham line rasterization WITHOUT the loop — the classical
-    error-accumulator walk has a closed form, y(k) = y0 + (2*dy*k +
-    dx) div (2*dx) (= round-half-up of dy*k/dx), so the 'inherently
-    sequential' renderer is one Column expression over an exploded
-    k-range: embarrassingly parallel per pixel, the exact opposite
-    of its textbook presentation (and the reason q58's line burn
-    can scale).  The walker's invariants become computed columns:
-    exactly dx+1 pixels (count_resid == 0), every step raises y by
-    0 or 1 (bad_steps == 0 — first-octant monotonicity), and the
-    endpoint lands exactly on (x0+dx, y0+dy) (endpoint_resid == 0).
-    Line 5 lands at slope exactly 1/2 (dx = 10, dy = 5 from the
-    key arithmetic — verified in design, the plant is checked not
-    presumed) so five k's hit the half-pixel tie, where conventions
-    genuinely diverge: half-up (ours, pinned in the formula) vs
-    banker's round-half-even disagree on 3 of those 5 pixels — two correct-looking
-    renderers drawing different lines is why the convention must
-    be pinned, not assumed.  One broadcast k-range join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q540_documents")
-    return spark.sql(_q540_sql("div", "q540_documents"))
-
-
-def _q541_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH gxs AS (SELECT DISTINCT doc_id % 32 AS g
-               FROM {tbl}),
-       px AS (SELECT a.g AS gx, b.g AS gy,
-                     (a.g*7 + b.g*11) % 16 AS v
-              FROM gxs a CROSS JOIN gxs b),
-       sat AS (SELECT gx, gy,
-                      CAST(sum(v) OVER (PARTITION BY gx
-                             ORDER BY gy
-                             ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                        AS colsum
-               FROM px),
-       sat2 AS (SELECT gx, gy,
-                       CAST(sum(colsum) OVER (PARTITION BY gy
-                              ORDER BY gx
-                              ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                         AS s
-                FROM sat),
-       probes AS (SELECT 0 AS pid, 3 AS ax, 4 AS ay, 12 AS bx,
-                         15 AS by UNION ALL
-                  SELECT 1, 0, 0, 31, 31 UNION ALL
-                  SELECT 2, 10, 10, 10, 10 UNION ALL
-                  SELECT 3, 0, 7, 19, 7 UNION ALL
-                  SELECT 4, 25, 2, 31, 30 UNION ALL
-                  SELECT 5, 16, 0, 23, 31),
-       four AS (SELECT p.pid,
-                       d.s
-                         - coalesce(l.s, 0) - coalesce(u.s, 0)
-                         + coalesce(ul.s, 0) AS sat_sum
-                FROM probes p
-                JOIN sat2 d ON d.gx = p.bx AND d.gy = p.by
-                LEFT JOIN sat2 l ON l.gx = p.ax - 1 AND l.gy = p.by
-                LEFT JOIN sat2 u ON u.gx = p.bx AND u.gy = p.ay - 1
-                LEFT JOIN sat2 ul ON ul.gx = p.ax - 1
-                                 AND ul.gy = p.ay - 1),
-       direct AS (SELECT p.pid,
-                         CAST(sum(px.v) AS BIGINT) AS direct_sum
-                  FROM probes p JOIN px
-                    ON px.gx BETWEEN p.ax AND p.bx
-                   AND px.gy BETWEEN p.ay AND p.by
-                  GROUP BY p.pid)
-       SELECT four.pid AS probe_id,
-              CAST(four.sat_sum AS BIGINT) AS sat_sum,
-              direct.direct_sum,
-              CAST(four.sat_sum - direct.direct_sum AS BIGINT)
-                AS resid
-       FROM four JOIN direct ON direct.pid = four.pid"""
-
-
-@query("q541_integral_image", _q541_sql("//"))
-def q541(spark, sf_dir):
-    """Integral image / summed-area table (Crow 1984; Viola-Jones'
-    workhorse and the O(1) box filter behind every fast focal mean
-    — the constant-time answer to q27's focal sum): the SAT is two
-    chained window cumsums (within-column then within-row — 2-D
-    prefix sums compose separably), and any box sum is the
-    inclusion-exclusion of FOUR corner lookups, D - L - U + UL with
-    out-of-raster corners coalesced to zero.  The identity is
-    verified, not trusted: six probe boxes — including the full
-    raster, a single cell, a one-row strip, and two edge-hugging
-    boxes that exercise every coalesce branch — each compare the
-    4-lookup answer against a direct aggregation over the box,
-    resid == 0 on all six.  The scale story is the contrast in the
-    same output: direct cost grows with box area (the 32x32 full-
-    raster probe touches 1024 cells), SAT cost is four broadcast
-    lookups regardless.  All exact integers."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q541_documents")
-    return spark.sql(_q541_sql("div", "q541_documents"))
-
-
-# --- rotating calipers + minimum enclosing circle (q542-q543) ----------------------------
-
-_CALIPER_PTS = """shapes AS (SELECT DISTINCT doc_id % 6 AS s FROM {tbl}),
-       js AS (SELECT a.i*4 + b.i AS j
-              FROM (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL
-                    SELECT 2 UNION ALL SELECT 3) a
-              JOIN (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL
-                    SELECT 2 UNION ALL SELECT 3) b ON 1=1),
-       pts AS{mat} (
-         SELECT sh.s, j.j,
-                CAST((sh.s*7 + j.j*j.j*(3 + sh.s) + j.j*5) % 21
-                     AS BIGINT) AS px,
-                CAST((sh.s*11 + j.j*j.j*7 + j.j*(3 + 2*sh.s)) % 21
-                     AS BIGINT) AS py
-         FROM shapes sh CROSS JOIN js j)"""
-
-
-def _q542_sql(mat: str, tbl: str = "documents") -> str:
-    pts = _CALIPER_PTS.format(mat=mat, tbl=tbl)
-    return f"""WITH {pts},
-       spans AS{mat} (
-         SELECT d.s, d.did, d.d2,
-                max(d.dy*(p.px - d.ax) - d.dx*(p.py - d.ay))
-                  - min(d.dy*(p.px - d.ax) - d.dx*(p.py - d.ay))
-                  AS cspan,
-                max(d.dx*(p.px - d.ax) + d.dy*(p.py - d.ay))
-                  - min(d.dx*(p.px - d.ax) + d.dy*(p.py - d.ay))
-                  AS dspan
-         FROM (SELECT a.s, a.j*16 + b.j AS did,
-                      b.px - a.px AS dx, b.py - a.py AS dy,
-                      (b.px - a.px)*(b.px - a.px)
-                        + (b.py - a.py)*(b.py - a.py) AS d2,
-                      a.px AS ax, a.py AS ay
-               FROM pts a JOIN pts b ON b.s = a.s AND b.j <> a.j
-               WHERE (b.px - a.px)*(b.px - a.px)
-                       + (b.py - a.py)*(b.py - a.py) <> 0) d
-         JOIN pts p ON p.s = d.s
-         GROUP BY d.s, d.did, d.d2),
-       rbest AS (SELECT sp.s, sp.did,
-                        sp.cspan*sp.dspan AS rect_num,
-                        sp.d2 AS rect_den
-                 FROM spans sp
-                 WHERE NOT EXISTS (
-                   SELECT 1 FROM spans o WHERE o.s = sp.s
-                     AND (o.cspan*o.dspan*sp.d2
-                            < sp.cspan*sp.dspan*o.d2
-                          OR (o.cspan*o.dspan*sp.d2
-                                = sp.cspan*sp.dspan*o.d2
-                              AND o.did < sp.did)))),
-       wbest AS (SELECT sp.s, sp.did,
-                        sp.cspan*sp.cspan AS width_num,
-                        sp.d2 AS width_den
-                 FROM spans sp
-                 WHERE NOT EXISTS (
-                   SELECT 1 FROM spans o WHERE o.s = sp.s
-                     AND (o.cspan*o.cspan*sp.d2
-                            < sp.cspan*sp.cspan*o.d2
-                          OR (o.cspan*o.cspan*sp.d2
-                                = sp.cspan*sp.cspan*o.d2
-                              AND o.did < sp.did)))),
-       dia AS (SELECT a.s,
-                      max((b.px - a.px)*(b.px - a.px)
-                          + (b.py - a.py)*(b.py - a.py)) AS diam2
-               FROM pts a JOIN pts b ON b.s = a.s GROUP BY a.s),
-       aabb AS (SELECT s,
-                       (max(px) - min(px))*(max(py) - min(py))
-                         AS aabb_area
-                FROM pts GROUP BY s)
-       SELECT CAST(r.s AS BIGINT) AS shape_id,
-              CAST(d.diam2 AS BIGINT) AS diam2,
-              CAST(r.did AS BIGINT) AS rect_dir,
-              CAST(r.rect_num AS BIGINT) AS rect_num,
-              CAST(r.rect_den AS BIGINT) AS rect_den,
-              CAST(r.rect_num AS DOUBLE)/r.rect_den AS rect_area,
-              CAST(w.did AS BIGINT) AS width_dir,
-              CAST(w.width_num AS BIGINT) AS width_num,
-              CAST(w.width_den AS BIGINT) AS width_den,
-              CAST(a.aabb_area AS BIGINT) AS aabb_area,
-              CAST(CASE WHEN r.rect_num <= a.aabb_area*r.rect_den
-                   THEN 1 ELSE 0 END AS BIGINT) AS rect_le_aabb,
-              CAST(CASE WHEN w.width_num <= d.diam2*w.width_den
-                   THEN 1 ELSE 0 END AS BIGINT) AS width_le_diam
-       FROM rbest r JOIN wbest w ON w.s = r.s
-       JOIN dia d ON d.s = r.s
-       JOIN aabb a ON a.s = r.s"""
-
-
-@query("q542_rotating_calipers", _q542_sql(" MATERIALIZED"))
-def q542(spark, sf_dir):
-    """Rotating calipers (Toussaint 1983): minimum-area oriented
-    bounding rectangle, directional width, and diameter of a point
-    set — the ST_OrientedEnvelope / minimum-rotated-rect surface the
-    reference exposes through its SQLite dialect's spatialite/GEOS
-    functions (ogr/ogrsf_frmts/sqlite/ogrsqlitesqlfunctions.cpp).
-    Freeman-Shapira's theorem (the calipers' correctness) — the
-    optimal rectangle has a side flush with a convex-hull edge —
-    makes the op RELATIONAL without any hull walk: hull edges are a
-    subset of all point pairs, so the exact optimum is the min over
-    every pair direction of (cross-span x dot-span) / |d|^2, a pure
-    BIGINT computation ranked by CROSS-MULTIPLICATION (num1*den2 vs
-    num2*den1, <= 2e9 — no float ever compares) with ties to the
-    lowest direction id; duplicate fixture points make some
-    candidate keys exactly EQUAL, so the tie rule is genuinely
-    exercised, not just documented.  Two theorems ride as computed
-    columns: the oriented minimum never exceeds the axis-aligned
-    bbox (rect_le_aabb == 1) and width never exceeds diameter
-    (width_le_diam == 1).  rect_area is the single raw IEEE
-    division both engines perform on identical integers (emitted
-    unrounded per the round-boundary rule).  Per-shape candidate
-    count is hull-edge-bounded in a production plan; here the
-    all-pairs superset is 240 rows/shape, broadcast scale, and the
-    argmin anti-join is s-partitioned — no cross-shape pairs."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q542_documents")
-    return spark.sql(_q542_sql("", "q542_documents"))
-
-
-def _q543_sql(mat: str, tbl: str = "documents") -> str:
-    pts = _CALIPER_PTS.format(mat=mat, tbl=tbl)
-    return f"""WITH {pts},
-       rawtri AS (
-         SELECT a.s, 256 + a.j*256 + b.j*16 + c.j AS cid,
-                2*(a.px*(b.py - c.py) + b.px*(c.py - a.py)
-                   + c.px*(a.py - b.py)) AS rd,
-                (a.px*a.px + a.py*a.py)*(b.py - c.py)
-                  + (b.px*b.px + b.py*b.py)*(c.py - a.py)
-                  + (c.px*c.px + c.py*c.py)*(a.py - b.py) AS rcx,
-                (a.px*a.px + a.py*a.py)*(c.px - b.px)
-                  + (b.px*b.px + b.py*b.py)*(a.px - c.px)
-                  + (c.px*c.px + c.py*c.py)*(b.px - a.px) AS rcy,
-                a.px AS x1, a.py AS y1
-         FROM pts a
-         JOIN pts b ON b.s = a.s AND a.j < b.j
-         JOIN pts c ON c.s = a.s AND b.j < c.j),
-       tri AS (SELECT s, cid, abs(rd) AS den,
-                      CASE WHEN rd < 0 THEN -rcx ELSE rcx END AS cxn,
-                      CASE WHEN rd < 0 THEN -rcy ELSE rcy END AS cyn,
-                      x1, y1
-               FROM rawtri WHERE rd <> 0),
-       cands AS{mat} (
-         SELECT a.s, a.j*16 + b.j AS cid, 2 AS den,
-                a.px + b.px AS cxn, a.py + b.py AS cyn,
-                (a.px - b.px)*(a.px - b.px)
-                  + (a.py - b.py)*(a.py - b.py) AS r2n,
-                2 AS sup_pts
-         FROM pts a JOIN pts b ON b.s = a.s AND a.j < b.j
-         UNION ALL
-         SELECT s, cid, den, cxn, cyn,
-                (den*x1 - cxn)*(den*x1 - cxn)
-                  + (den*y1 - cyn)*(den*y1 - cyn) AS r2n,
-                3 AS sup_pts
-         FROM tri),
-       feas AS{mat} (
-         SELECT c.* FROM cands c
-         WHERE NOT EXISTS (
-           SELECT 1 FROM pts p WHERE p.s = c.s
-             AND (c.den*p.px - c.cxn)*(c.den*p.px - c.cxn)
-                   + (c.den*p.py - c.cyn)*(c.den*p.py - c.cyn)
-                 > c.r2n)),
-       best AS (SELECT f.* FROM feas f
-                WHERE NOT EXISTS (
-                  SELECT 1 FROM feas o WHERE o.s = f.s
-                    AND (o.r2n*f.den*f.den < f.r2n*o.den*o.den
-                         OR (o.r2n*f.den*f.den = f.r2n*o.den*o.den
-                             AND o.cid < f.cid)))),
-       dia AS (SELECT a.s,
-                      max((b.px - a.px)*(b.px - a.px)
-                          + (b.py - a.py)*(b.py - a.py)) AS diam2
-               FROM pts a JOIN pts b ON b.s = a.s GROUP BY a.s),
-       onb AS (SELECT b.s,
-                      CAST(sum(CASE WHEN
-                          (b.den*p.px - b.cxn)*(b.den*p.px - b.cxn)
-                            + (b.den*p.py - b.cyn)*(b.den*p.py - b.cyn)
-                          = b.r2n THEN 1 ELSE 0 END) AS BIGINT)
-                        AS n_on,
-                      CAST(sum(CASE WHEN
-                          (b.den*p.px - b.cxn)*(b.den*p.px - b.cxn)
-                            + (b.den*p.py - b.cyn)*(b.den*p.py - b.cyn)
-                          > b.r2n THEN 1 ELSE 0 END) AS BIGINT)
-                        AS n_outside
-               FROM best b JOIN pts p ON p.s = b.s
-               GROUP BY b.s)
-       SELECT CAST(b.s AS BIGINT) AS shape_id,
-              CAST(b.cid AS BIGINT) AS cand_id,
-              CAST(b.sup_pts AS BIGINT) AS sup_pts,
-              CAST(b.den AS BIGINT) AS den,
-              CAST(b.cxn AS BIGINT) AS cx_num,
-              CAST(b.cyn AS BIGINT) AS cy_num,
-              CAST(b.r2n AS BIGINT) AS r2_num,
-              CAST(b.r2n AS DOUBLE)/(b.den*b.den) AS r2,
-              o.n_on, o.n_outside,
-              CAST(d.diam2 AS BIGINT) AS diam2,
-              CAST(CASE WHEN 4*b.r2n >= d.diam2*b.den*b.den
-                   THEN 1 ELSE 0 END AS BIGINT) AS covers_diameter
-       FROM best b JOIN onb o ON o.s = b.s
-       JOIN dia d ON d.s = b.s"""
-
-
-@query("q543_min_enclosing_circle", _q543_sql(" MATERIALIZED"))
-def q543(spark, sf_dir):
-    """Minimum enclosing circle (Welzl 1991 semantics, the
-    ST_MinimumBoundingCircle surface reached through the reference's
-    SQLite-dialect GEOS functions — ogrsqlitesqlfunctions.cpp) made
-    EXACT and relational: the optimum is determined by 2 or 3
-    support points, so the candidate set is every pair's diameter
-    circle plus every non-degenerate triple's circumcircle, each
-    carried as an exact RATIONAL (den, cx_num, cy_num, r2_num) with
-    den = 2|cross| from the circumcenter determinant — no float
-    touches feasibility or ranking.  Containment is the
-    cross-multiplied test (den*px - cx_num)^2 + (den*py - cy_num)^2
-    <= r2_num (<= 3.7e10), the radius argmin cross-multiplies
-    r2n*den'^2 (<= 3.9e13, BIGINT-safe by design measurement), ties
-    to lowest candidate id — duplicate fixture points produce
-    coincident candidate circles, so the tie branch is live.  The
-    fixture plants BOTH support branches: shapes 0 land on a
-    2-point diameter circle, others on 3-point circumcircles
-    (sup_pts verifies which).  Proofs are emitted, not assumed:
-    n_outside == 0 re-derives feasibility on the winner, n_on >=
-    sup_pts counts boundary contacts, covers_diameter == 1 pins
-    r >= diameter/2.  Candidates are C(16,3)-bounded per shape and
-    the feasibility anti-join is shape-partitioned — at scale this
-    is the per-feature mapInPandas shape, never a corpus join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q543_documents")
-    return spark.sql(_q543_sql("", "q543_documents"))
-
-
-# --- Otsu thresholding + ordered Bayer dithering (q544-q545) -----------------------------
-
-_SET16 = ("SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2 UNION ALL "
-          "SELECT 3 UNION ALL SELECT 4 UNION ALL SELECT 5 UNION ALL "
-          "SELECT 6 UNION ALL SELECT 7 UNION ALL SELECT 8 UNION ALL "
-          "SELECT 9 UNION ALL SELECT 10 UNION ALL SELECT 11 UNION ALL "
-          "SELECT 12 UNION ALL SELECT 13 UNION ALL SELECT 14 UNION ALL "
-          "SELECT 15")
-
-
-def _q544_sql(mat: str, tbl: str = "documents") -> str:
-    return f"""WITH imgs AS (SELECT DISTINCT doc_id % 8 AS i FROM {tbl}),
-       s16 AS ({_SET16}),
-       ps AS (SELECT hi.i*16 + lo.i AS p
-              FROM s16 hi JOIN s16 lo ON 1=1),
-       px AS{mat} (
-         SELECT im.i, p.p,
-                CAST(CASE WHEN (p.p + im.i) % (3 + im.i % 3) = 0
-                     THEN 9 + im.i % 3 + (p.p*5 + im.i*3) % 4
-                     ELSE im.i % 4 + (p.p*3 + im.i*5) % 4 END
-                     AS BIGINT) AS v
-         FROM imgs im CROSS JOIN ps p),
-       tot AS{mat} (
-         SELECT i, CAST(count(*) AS BIGINT) AS nn,
-                CAST(sum(v) AS BIGINT) AS stot,
-                CAST(sum(v*v) AS BIGINT) AS sstot
-         FROM px GROUP BY i),
-       ts AS (SELECT i AS t FROM s16 WHERE i < 15),
-       cums AS (SELECT p.i, t.t,
-                       CAST(count(*) AS BIGINT) AS w0,
-                       CAST(sum(p.v) AS BIGINT) AS s0,
-                       CAST(sum(p.v*p.v) AS BIGINT) AS ss0
-                FROM px p JOIN ts t ON p.v <= t.t
-                GROUP BY p.i, t.t),
-       cand AS{mat} (
-         SELECT c.i, c.t, c.w0, c.s0, c.ss0,
-                o.nn, o.stot, o.sstot,
-                (c.s0*o.nn - o.stot*c.w0)*(c.s0*o.nn - o.stot*c.w0)
-                  AS bnum,
-                c.w0*(o.nn - c.w0) AS bden
-         FROM cums c JOIN tot o ON o.i = c.i
-         WHERE c.w0 > 0 AND c.w0 < o.nn),
-       best AS (SELECT c.* FROM cand c
-                WHERE NOT EXISTS (
-                  SELECT 1 FROM cand o WHERE o.i = c.i
-                    AND (o.bnum*c.bden > c.bnum*o.bden
-                         OR (o.bnum*c.bden = c.bnum*o.bden
-                             AND o.t < c.t))))
-       SELECT CAST(b.i AS BIGINT) AS image_id,
-              CAST(b.t AS BIGINT) AS threshold,
-              b.w0, b.nn - b.w0 AS w1,
-              CAST(b.bnum AS BIGINT) AS bnum,
-              CAST(b.bden AS BIGINT) AS bden,
-              CAST(b.bnum AS DOUBLE)/(b.bden*b.nn*b.nn) AS sigma_b2,
-              CAST((b.nn*b.sstot - b.stot*b.stot)*b.bden
-                   - (b.bnum
-                      + b.nn*(b.nn - b.w0)*(b.ss0*b.w0 - b.s0*b.s0)
-                      + b.nn*b.w0*((b.sstot - b.ss0)*(b.nn - b.w0)
-                                   - (b.stot - b.s0)*(b.stot - b.s0)))
-                   AS BIGINT) AS scatter_resid,
-              CAST(CASE WHEN b.i % 4 + 3 <= b.t
-                         AND b.t < 9 + b.i % 3
-                   THEN 1 ELSE 0 END AS BIGINT) AS separates_modes
-       FROM best b"""
-
-
-@query("q544_otsu_threshold", _q544_sql(" MATERIALIZED"))
-def q544(spark, sf_dir):
-    """Otsu's threshold (Otsu 1979 — the automatic binarization
-    upstream of every mask-polygonize pipeline; the reference's
-    histogram surface GDALRasterBand::GetHistogram,
-    gcore/rasterband.cpp, is exactly the input it consumes): per
-    image maximize the between-class scatter over the 15 candidate
-    cuts — sigma_b^2(t) = (s0*N - S*w0)^2 / (w0*w1) up to the 1/N^2
-    the argmax ignores — ranked by BIGINT cross-multiplication
-    (num^2*den' <= 2.8e14, measured at design time), ties to the
-    LOWEST t.  Otsu's decomposition theorem rides as a per-row
-    emitted proof: multiplying sigma_total^2 = sigma_b^2 +
-    sigma_w^2 through by N^2*w0*w1 gives an ALL-INTEGER identity
-    (N*SS - S^2)*w0*w1 = bnum + N*w1*(SS0*w0 - s0^2) +
-    N*w0*(SS1*w1 - s1^2), and scatter_resid == 0 re-derives it
-    from the winner's cumulants — the float sigma_b2 column is one
-    IEEE division of exact integers, emitted raw.  The 8 bimodal
-    fixtures move BOTH modes and the mixture weight per image
-    (bg [i%4, i%4+3], fg [9+i%3, ...], fraction 1/(3+i%3)) so the
-    argmax genuinely varies (t* spans 3..6, design-verified) and
-    separates_modes == 1 lands strictly between the planted modes
-    on every image.  One pixel scan to 16-bin cumulants, then a
-    15-row dim per image — at raster scale the histogram groupBy is
-    the only corpus-sized pass, map-side combinable."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q544_documents")
-    return spark.sql(_q544_sql("", "q544_documents"))
-
-
-def _q545_sql(divop: str, tbl: str = "documents") -> str:
-    return f"""WITH xs AS (SELECT DISTINCT doc_id % 64 AS x FROM {tbl}),
-       ys AS (SELECT DISTINCT doc_id % 16 AS y FROM {tbl}),
-       px AS (SELECT x.x, y.y,
-                     x.x {divop} 4 AS v,
-                     x.x % 4 AS mx, y.y % 4 AS my
-              FROM xs x CROSS JOIN ys y),
-       dith AS (SELECT x, y, v,
-                       4*(2*(mx % 2) + 3*(my % 2)
-                          - 4*(my % 2)*(mx % 2))
-                         + (2*(mx {divop} 2) + 3*(my {divop} 2)
-                            - 4*(my {divop} 2)*(mx {divop} 2))
-                         AS bayer
-                FROM px),
-       tiles AS (SELECT x {divop} 4 AS tx, y {divop} 4 AS ty,
-                        CAST(max(v) AS BIGINT) AS v,
-                        CAST(sum(CASE WHEN v > bayer THEN 1 ELSE 0
-                                 END) AS BIGINT) AS on_count,
-                        CAST(count(DISTINCT bayer) AS BIGINT)
-                          AS m_distinct
-                 FROM dith GROUP BY x {divop} 4, y {divop} 4)
-       SELECT CAST(tx AS BIGINT) AS tile_x,
-              CAST(ty AS BIGINT) AS tile_y,
-              v AS gray_level, on_count,
-              on_count - v AS conservation_resid,
-              m_distinct
-       FROM tiles"""
-
-
-@query("q545_bayer_ordered_dither", _q545_sql("//"))
-def q545(spark, sf_dir):
-    """Ordered (Bayer) dithering — the pixel-PARALLEL halftone,
-    the exact counterpoint to q196's Floyd-Steinberg error
-    diffusion whose left-to-right error recurrence is inherently
-    sequential per row: the 4x4 Bayer index matrix has the closed
-    form M4(x,y) = 4*M2(y%2, x%2) + M2(y div 2, x div 2) with
-    M2(r,c) = 2c + 3r - 4rc (the recursive construction collapsed
-    to arithmetic — no lookup table, no loop), so thresholding is
-    one Column expression per pixel and the whole raster dithers
-    in a single embarrassingly-parallel pass (the reason ordered
-    dither is the 100-TB halftone and error diffusion is not).
-    Correctness is the permutation theorem, emitted per tile, not
-    assumed: each 4x4 tile of M4 is a permutation of 0..15
-    (m_distinct == 16 on all 64 tiles), hence a constant-v tile
-    turns on EXACTLY v of its 16 pixels — on_count == v
-    (conservation_resid == 0) across the full 16-level gradient
-    ramp, the mean-intensity preservation q196 achieves only via
-    its sequential error ledger.  All exact integers; one generated
-    64x16 grid, one groupBy tile."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q545_documents")
-    return spark.sql(_q545_sql("div", "q545_documents"))
-
-
-# --- binary morphology + Hough-style line detection (q546-q547) --------------------------
-
-
-def _q546_sql(divop: str, mat: str, tbl: str = "documents") -> str:
-    return f"""WITH xs AS (SELECT DISTINCT doc_id % 24 AS x FROM {tbl}),
-       px AS{mat} (
-         SELECT x.x AS x, y.x AS y,
-                CAST(CASE WHEN x.x BETWEEN 3 AND 9
-                            AND y.x BETWEEN 3 AND 9
-                            AND NOT (x.x = 6 AND y.x = 6) THEN 1
-                     WHEN y.x = 14 AND x.x BETWEEN 2 AND 21 THEN 1
-                     WHEN x.x >= 12 AND y.x <= 10
-                          AND (x.x*7 + y.x*11) % 23 = 0 THEN 1
-                     WHEN x.x >= 12 AND y.x >= 16
-                          AND (x.x*5 + y.x*3) % 7 < 3 THEN 1
-                     ELSE 0 END AS BIGINT) AS v
-         FROM xs x CROSS JOIN xs y),
-       ns AS{mat} (
-         SELECT a.x, a.y, a.v, CAST(sum(b.v) AS BIGINT) AS s
-         FROM px a JOIN px b
-           ON b.x BETWEEN a.x - 1 AND a.x + 1
-          AND b.y BETWEEN a.y - 1 AND a.y + 1
-         GROUP BY a.x, a.y, a.v),
-       ed AS{mat} (
-         SELECT x, y, v,
-                CASE WHEN s = 9 THEN 1 ELSE 0 END AS ero,
-                CASE WHEN s >= 1 THEN 1 ELSE 0 END AS dil
-         FROM ns),
-       op AS{mat} (
-         SELECT a.x, a.y,
-                CASE WHEN max(b.ero) = 1 THEN 1 ELSE 0 END AS opn
-         FROM ed a JOIN ed b
-           ON b.x BETWEEN a.x - 1 AND a.x + 1
-          AND b.y BETWEEN a.y - 1 AND a.y + 1
-         GROUP BY a.x, a.y),
-       cl AS{mat} (
-         SELECT a.x, a.y,
-                CASE WHEN min(b.dil) = 1 AND count(*) = 9
-                THEN 1 ELSE 0 END AS cls
-         FROM ed a JOIN ed b
-           ON b.x BETWEEN a.x - 1 AND a.x + 1
-          AND b.y BETWEEN a.y - 1 AND a.y + 1
-         GROUP BY a.x, a.y),
-       cells AS{mat} (
-         SELECT e.x, e.y, e.v, e.ero, e.dil, o.opn, c.cls
-         FROM ed e
-         JOIN op o ON o.x = e.x AND o.y = e.y
-         JOIN cl c ON c.x = e.x AND c.y = e.y)
-       SELECT CAST(x {divop} 8 AS BIGINT) AS block_x,
-              CAST(y {divop} 8 AS BIGINT) AS block_y,
-              CAST(sum(v) AS BIGINT) AS n_a,
-              CAST(sum(ero) AS BIGINT) AS n_ero,
-              CAST(sum(dil) AS BIGINT) AS n_dil,
-              CAST(sum(opn) AS BIGINT) AS n_open,
-              CAST(sum(cls) AS BIGINT) AS n_close,
-              CAST(sum(dil - ero) AS BIGINT) AS n_gradient,
-              CAST(sum(CASE WHEN opn = 1 AND v = 0
-                       THEN 1 ELSE 0 END) AS BIGINT) AS open_not_a,
-              CAST(sum(CASE WHEN v = 1 AND cls = 0
-                            AND x BETWEEN 1 AND 22
-                            AND y BETWEEN 1 AND 22
-                       THEN 1 ELSE 0 END) AS BIGINT)
-                AS a_not_close_interior,
-              CAST(sum(CASE WHEN opn = 1 AND y = 14
-                            AND x BETWEEN 2 AND 21
-                       THEN 1 ELSE 0 END) AS BIGINT) AS open_on_line,
-              CAST(sum(CASE WHEN x = 6 AND y = 6 THEN cls ELSE 0
-                       END) AS BIGINT) AS close_at_hole
-       FROM cells GROUP BY x {divop} 8, y {divop} 8"""
-
-
-@query("q546_binary_morphology", _q546_sql("//", " MATERIALIZED"))
-def q546(spark, sf_dir):
-    """Binary mathematical morphology (Serra/Matheron; the mask
-    clean-up pass between thresholding — q544 — and polygonize —
-    q26): erosion, dilation, opening, closing and the morphological
-    gradient under a 3x3 box structuring element, each a NEIGHBOR
-    AGGREGATION (sum of the 9-cell window, threshold 9 or 1) — the
-    same halo-exchange focal shape as operators/focal.py, so at
-    raster scale every stage is one boundary-strip exchange, never a
-    global pass.  Out-of-raster is pinned OFF, which makes the
-    border semantics honest rather than assumed: closing is
-    extensive ONLY on the interior (the 9 planted border pixels
-    that closing loses are exactly why a_not_close_interior
-    restricts to 1..22 — design-verified that all violations sit on
-    the x=23/y=23 edge), while opening's anti-extensivity holds
-    everywhere (open_not_a == 0).  The fixture plants each
-    operator's signature behavior: a 1-px line that opening erases
-    completely (open_on_line == 0 in every block), a single-pixel
-    hole that closing fills (close_at_hole == 1 in block 0,0), a
-    blob that survives erosion, and hash noise for the generic
-    paths; per-8x8-block counts of all five stages are the output.
-    All exact integers, three bounded self-joins."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q546_documents")
-    return spark.sql(_q546_sql("div", "", "q546_documents"))
-
-
-def _q547_sql(mat: str, tbl: str = "documents") -> str:
-    return f"""WITH ks AS (SELECT DISTINCT doc_id % 80 AS k FROM {tbl}),
-       i12 AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2
-               UNION ALL SELECT 3 UNION ALL SELECT 4 UNION ALL
-               SELECT 5 UNION ALL SELECT 6 UNION ALL SELECT 7
-               UNION ALL SELECT 8 UNION ALL SELECT 9 UNION ALL
-               SELECT 10 UNION ALL SELECT 11),
-       pts AS{mat} (
-         SELECT DISTINCT x, y FROM (
-           SELECT (k*13 + 7) % 32 AS x, (k*k*5 + k*3) % 32 AS y
-           FROM ks
-           UNION ALL
-           SELECT 3 + i AS x, 2*(3 + i) - 5 AS y FROM i12
-           UNION ALL
-           SELECT 4 + 2*i AS x, 4 + 2*i + 3 AS y FROM i12
-           WHERE i < 8) u
-         WHERE y BETWEEN 0 AND 31),
-       dirs AS (SELECT 0 AS did, 1 AS dx, 0 AS dy
-                UNION ALL SELECT 1, 0, 1 UNION ALL SELECT 2, 1, 1
-                UNION ALL SELECT 3, 1, -1 UNION ALL SELECT 4, 2, 1
-                UNION ALL SELECT 5, 1, 2 UNION ALL SELECT 6, 2, -1
-                UNION ALL SELECT 7, 1, -2),
-       acc AS{mat} (
-         SELECT d.did, d.dx, d.dy,
-                p.x*d.dy - p.y*d.dx AS rho,
-                CAST(count(*) AS BIGINT) AS cnt
-         FROM pts p CROSS JOIN dirs d
-         GROUP BY d.did, d.dx, d.dy, p.x*d.dy - p.y*d.dx),
-       best AS (SELECT a.* FROM acc a
-                WHERE NOT EXISTS (
-                  SELECT 1 FROM acc o WHERE o.did = a.did
-                    AND (o.cnt > a.cnt
-                         OR (o.cnt = a.cnt AND o.rho < a.rho)))),
-       atmax AS (SELECT a.did,
-                        CAST(count(*) AS BIGINT) AS n_at_max
-                 FROM acc a JOIN best b
-                   ON b.did = a.did AND a.cnt = b.cnt
-                 GROUP BY a.did)
-       SELECT CAST(b.did AS BIGINT) AS dir_id,
-              CAST(b.dx AS BIGINT) AS dx,
-              CAST(b.dy AS BIGINT) AS dy,
-              CAST(b.rho AS BIGINT) AS best_rho,
-              b.cnt AS n_on_line,
-              m.n_at_max,
-              CAST(CASE WHEN b.dx = 1 AND b.dy = 2 AND b.rho = 5
-                   THEN 1 ELSE 0 END AS BIGINT) AS hits_primary,
-              CAST(CASE WHEN b.dx = 1 AND b.dy = 1 AND b.rho = -3
-                   THEN 1 ELSE 0 END AS BIGINT) AS hits_secondary
-       FROM best b JOIN atmax m ON m.did = b.did"""
-
-
-@query("q547_hough_line_detection", _q547_sql(" MATERIALIZED"))
-def q547(spark, sf_dir):
-    """Hough-style line detection over exact integer direction
-    families — the raster-to-vector line extractor (the detection
-    complement of q540's closed-form Bresenham renderer), made
-    float-free: instead of quantizing (theta, rho) with trig, each
-    of 8 integer direction vectors (1,0)..(1,-2) indexes points by
-    the EXACT signed cross product rho = x*dy - y*dx, so collinear
-    points land in the same accumulator cell with zero quantization
-    error and the vote is one map-side-combinable groupBy(dir, rho)
-    — at corpus scale the accumulator is bounded by the rho domain,
-    never the point count, the same linearity story as the df-cap.
-    Two planted lines recover exactly: y = 2x - 5 (12 points, dir
-    (1,2), rho 5 — hits_primary) and y = x + 3 (8 points, dir
-    (1,1), rho -3 — hits_secondary), both UNIQUE argmaxes over 51
-    distinct points of hash scatter (design-verified: scatter peaks
-    at 2-3 votes).  The per-direction argmax carries the tie rule
-    (max count, then LOWEST rho) and n_at_max emits the size of the
-    tie class — up to 23 on scatter-only directions, 1 on the
-    planted ones, so the tie branch is live in the output, not just
-    the rule."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q547_documents")
-    return spark.sql(_q547_sql("", "q547_documents"))
-
-
-# --- maximal empty rectangle + stress centrality (q548-q549) -----------------------------
-
-
-def _q548_sql(mat: str, tbl: str = "documents") -> str:
-    return ("WITH " + _q548_head(mat, tbl) + ",\n       "
-            + _q548_tail(mat))
-
-
-def _q548_head(mat: str, tbl: str = "documents") -> str:
-    """Stages xs..mt — everything at or below the 44k-candidate
-    SAT join.  Split out so the engine can materialize mt ONCE:
-    best/atmax/nempty reference it 4 ways, and unmaterialized each
-    reference re-executes the whole candidate chain (the
-    count-references rule; 5.5 s -> the chain runs once)."""
-    return f"""xs AS (SELECT DISTINCT doc_id % 20 AS x FROM {tbl}),
-       px AS{mat} (
-         SELECT x.x AS x, y.x AS y,
-                CAST(CASE WHEN (x.x BETWEEN 12 AND 17
-                                AND y.x BETWEEN 4 AND 10)
-                            OR (x.x BETWEEN 2 AND 8
-                                AND y.x BETWEEN 13 AND 15) THEN 0
-                     WHEN (x.x*11 + y.x*7 + (x.x*y.x) % 5) % 9 = 0
-                     THEN 1 ELSE 0 END AS BIGINT) AS v
-         FROM xs x CROSS JOIN xs y),
-       sat1 AS (SELECT x, y,
-                       CAST(sum(v) OVER (PARTITION BY x ORDER BY y
-                              ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                         AS colsum
-                FROM px),
-       sat2 AS{mat} (
-         SELECT x, y,
-                CAST(sum(colsum) OVER (PARTITION BY y ORDER BY x
-                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS s
-         FROM sat1),
-       cands AS (SELECT a.x AS x0, b.x AS x1, c.x AS y0, d.x AS y1
-                 FROM xs a JOIN xs b ON b.x >= a.x
-                 JOIN xs c ON 1=1 JOIN xs d ON d.x >= c.x),
-       boxes AS{mat} (
-         SELECT cd.x0, cd.x1, cd.y0, cd.y1,
-                (cd.x1 - cd.x0 + 1)*(cd.y1 - cd.y0 + 1) AS area,
-                dd.s - coalesce(l.s, 0) - coalesce(u.s, 0)
-                  + coalesce(ul.s, 0) AS boxsum
-         FROM cands cd
-         JOIN sat2 dd ON dd.x = cd.x1 AND dd.y = cd.y1
-         LEFT JOIN sat2 l ON l.x = cd.x0 - 1 AND l.y = cd.y1
-         LEFT JOIN sat2 u ON u.x = cd.x1 AND u.y = cd.y0 - 1
-         LEFT JOIN sat2 ul ON ul.x = cd.x0 - 1 AND ul.y = cd.y0 - 1),
-       mt AS{mat} (SELECT * FROM boxes WHERE boxsum = 0)"""
-
-
-def _q548_tail(mat: str) -> str:
-    return f"""best AS{mat} (
-         SELECT e.* FROM mt e
-         WHERE NOT EXISTS (
-           SELECT 1 FROM mt o
-           WHERE o.area > e.area
-              OR (o.area = e.area
-                  AND o.x0*8000 + o.y0*400 + o.x1*20 + o.y1
-                      < e.x0*8000 + e.y0*400 + e.x1*20 + e.y1))),
-       atmax AS (SELECT CAST(count(*) AS BIGINT) AS n_at_max
-                 FROM mt e JOIN best b ON e.area = b.area),
-       nempty AS (SELECT CAST(count(*) AS BIGINT) AS n_empty FROM mt),
-       flags AS (
-         SELECT CAST(sum(CASE WHEN p.x BETWEEN b.x0 AND b.x1
-                              AND p.y BETWEEN b.y0 AND b.y1
-                         THEN p.v ELSE 0 END) AS BIGINT)
-                  AS direct_recount,
-                CAST(max(CASE WHEN b.x0 > 0 AND p.x = b.x0 - 1
-                              AND p.y BETWEEN b.y0 AND b.y1
-                         THEN p.v ELSE 0 END) AS BIGINT) AS obs_l,
-                CAST(max(CASE WHEN b.x1 < 19 AND p.x = b.x1 + 1
-                              AND p.y BETWEEN b.y0 AND b.y1
-                         THEN p.v ELSE 0 END) AS BIGINT) AS obs_r,
-                CAST(max(CASE WHEN b.y0 > 0 AND p.y = b.y0 - 1
-                              AND p.x BETWEEN b.x0 AND b.x1
-                         THEN p.v ELSE 0 END) AS BIGINT) AS obs_u,
-                CAST(max(CASE WHEN b.y1 < 19 AND p.y = b.y1 + 1
-                              AND p.x BETWEEN b.x0 AND b.x1
-                         THEN p.v ELSE 0 END) AS BIGINT) AS obs_d
-         FROM best b CROSS JOIN px p)
-       SELECT CAST(b.x0 AS BIGINT) AS x0, CAST(b.y0 AS BIGINT) AS y0,
-              CAST(b.x1 AS BIGINT) AS x1, CAST(b.y1 AS BIGINT) AS y1,
-              CAST(b.area AS BIGINT) AS area,
-              n.n_empty, m.n_at_max, f.direct_recount,
-              CAST(CASE WHEN b.x0 = 0 OR f.obs_l = 1 THEN 1 ELSE 0
-                   END AS BIGINT) AS blocked_left,
-              CAST(CASE WHEN b.x1 = 19 OR f.obs_r = 1 THEN 1 ELSE 0
-                   END AS BIGINT) AS blocked_right,
-              CAST(CASE WHEN b.y0 = 0 OR f.obs_u = 1 THEN 1 ELSE 0
-                   END AS BIGINT) AS blocked_up,
-              CAST(CASE WHEN b.y1 = 19 OR f.obs_d = 1 THEN 1 ELSE 0
-                   END AS BIGINT) AS blocked_down
-       FROM best b CROSS JOIN atmax m CROSS JOIN nempty n
-       CROSS JOIN flags f"""
-
-
-@query("q548_max_empty_rectangle", _q548_sql(" MATERIALIZED"))
-def q548(spark, sf_dir):
-    """Maximal empty rectangle over a binary obstacle raster — the
-    site-selection query (largest buildable clearing, largest
-    label-placement box: q527's MIS sibling) solved by COMPOSING
-    q541's summed-area table: all 44,100 candidate rectangles test
-    emptiness in O(1) each via the 4-corner inclusion-exclusion (one
-    inner + three left broadcast joins against the 400-row SAT), so
-    total cost is candidates x O(1) instead of candidates x area —
-    the SAT turns a quartic scan into a quadratic one, which is the
-    whole reason the op scales to real rasters (where candidates
-    are further bounded by maximal-run seeds).  The argmax carries
-    area then lexicographic (x0,y0,x1,y1) packed into one key;
-    n_at_max == 1 emits that the winner is UNIQUE rather than
-    assuming it, direct_recount == 0 re-verifies emptiness by a
-    second, SAT-free derivation over the raw pixels, and the four
-    blocked_* == 1 columns are the MAXIMALITY certificate — growing
-    the winner one step in any direction hits an obstacle or the
-    raster edge (design-verified: the emergent 6x10 winner at
-    (12,3)-(17,12) beats both planted clearings by annexing hash-
-    empty rows).  All exact integers."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q548_documents")
-    head = _q548_head("", "q548_documents")
-    _ckpt_view(spark, "WITH " + head + "\nSELECT * FROM mt",
-               "q548_mt")
-    tail = re.sub(r"\bmt\b", "q548_mt", _q548_tail(""))
-    return spark.sql("WITH " + head + ",\n       " + tail)
-
-
-_Q549_EDGES = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 0), (0, 3),
-               (10, 11), (11, 12), (12, 13), (13, 14), (14, 15),
-               (15, 10), (10, 13), (5, 8), (8, 10)]
-
-
-def _q549_edges_sql(tbl: str) -> str:
-    rows = " UNION ALL ".join(
-        f"SELECT {a} AS a, {b} AS b" for a, b in _Q549_EDGES)
-    return f"""anchor AS (SELECT DISTINCT doc_id % 1 AS z FROM {tbl}),
-       eraw AS ({rows}),
-       edges AS (SELECT e.a, e.b FROM eraw e JOIN anchor ON 1=1
-                 UNION ALL
-                 SELECT e.b AS a, e.a AS b FROM eraw e
-                 JOIN anchor ON 1=1)"""
-
-
-def _q549_final(dtbl: str) -> str:
-    return f"""deg AS (SELECT a AS node, CAST(count(*) AS BIGINT)
-                    AS degree
-               FROM edges GROUP BY a),
-       ecc AS (SELECT u AS node, CAST(max(dist) AS BIGINT) AS ecc
-               FROM {dtbl} GROUP BY u),
-       stress AS (SELECT a.v AS node,
-                         CAST(sum(a.sig*b.sig) AS BIGINT) AS stress
-                  FROM {dtbl} a
-                  JOIN {dtbl} b ON b.u = a.v
-                  JOIN {dtbl} c ON c.u = a.u AND c.v = b.v
-                  WHERE a.dist > 0 AND b.dist > 0 AND a.u <> b.v
-                    AND a.dist + b.dist = c.dist
-                  GROUP BY a.v),
-       tot AS (SELECT CAST(sum(sig*(dist - 1)) AS BIGINT) AS expct
-               FROM {dtbl} WHERE dist > 0),
-       sms AS (SELECT CAST(sum(stress) AS BIGINT) AS actual
-               FROM stress),
-       npairs AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs
-                  FROM {dtbl})
-       SELECT CAST(d.node AS BIGINT) AS node, d.degree, e.ecc,
-              CAST(coalesce(s.stress, 0) AS BIGINT) AS stress,
-              sms.actual - tot.expct AS conservation_resid,
-              npairs.n_pairs
-       FROM deg d JOIN ecc e ON e.node = d.node
-       LEFT JOIN stress s ON s.node = d.node
-       CROSS JOIN tot CROSS JOIN sms CROSS JOIN npairs"""
-
-
-def _q549_oracle(tbl: str = "documents", rounds: int = 7) -> str:
-    stages = []
-    for r in range(1, rounds + 1):
-        stages.append(f"""d{r} AS MATERIALIZED (
-         SELECT * FROM d{r-1}
-         UNION ALL
-         SELECT f.u, e.b AS v, {r} AS dist,
-                CAST(sum(f.sig) AS BIGINT) AS sig
-         FROM d{r-1} f JOIN edges e ON e.a = f.v
-         WHERE f.dist = {r-1}
-           AND NOT EXISTS (SELECT 1 FROM d{r-1} x
-                           WHERE x.u = f.u AND x.v = e.b)
-         GROUP BY f.u, e.b)""")
-    chain = ",\n       ".join(stages)
-    return (f"WITH {_q549_edges_sql(tbl)},\n"
-            f"       nodes AS (SELECT DISTINCT a AS n FROM edges),\n"
-            f"       d0 AS (SELECT n AS u, n AS v, 0 AS dist,\n"
-            f"                     CAST(1 AS BIGINT) AS sig FROM nodes),\n"
-            f"       {chain},\n"
-            f"       {_q549_final(f'd{rounds}')}")
-
-
-@query("q549_stress_centrality", _q549_oracle())
-def q549(spark, sf_dir):
-    """Stress centrality (Shimbel 1953; Brandes' betweenness with
-    the division dropped, so everything stays EXACT BIGINT — the
-    same dodge as q74's octants: the statistic the float version
-    ranks by is monotone in this integer one): stress(v) counts
-    shortest paths THROUGH v as sigma(s,v)*sigma(v,t) over pairs
-    with d(s,v) + d(v,t) = d(s,t).  The engine runs a REAL
-    BFS-with-path-counting DataFrame loop — per round one frontier
-    join + one left-anti against the settled set + a sum-combining
-    groupBy (layer semantics: sigma at dist r sums over ALL
-    dist-(r-1) predecessors), localCheckpoint per round (the q521
-    doubling-chain rule: each round references its prior table
-    twice) — while the oracle unrolls the identical spec as 7
-    MATERIALIZED stages.  The two-cluster bridge fixture plants the
-    expected structure (bridge endpoints 5/10 and the bridge node 8
-    dominate at 148/154/144; chord-cycle clusters give 72 pairs
-    with MULTIPLE shortest paths so the sigma multiplication is
-    genuinely exercised) and two proofs ride in the output:
-    n_pairs == 169 certifies BFS convergence (all 13x13 pairs
-    settled within 7 rounds, diameter 7 by design), and the
-    path-counting conservation law sum_v stress(v) = sum_pairs
-    sigma*(d-1) — each shortest path has d-1 interior vertices —
-    lands at 758 = 758, resid == 0."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q549_documents")
-    edges = spark.sql(
-        f"WITH {_q549_edges_sql('q549_documents')} "
-        "SELECT * FROM edges")
-    edges = edges.localCheckpoint()
-    nodes = edges.select(F.col("a").alias("n")).distinct()
-    d = nodes.select(
-        F.col("n").alias("u"), F.col("n").alias("v"),
-        F.lit(0).alias("dist"), F.lit(1).cast("long").alias("sig"))
-    d = d.localCheckpoint()
-    for r in range(1, 8):
-        frontier = d.filter(F.col("dist") == r - 1)
-        new = (frontier.join(edges, frontier["v"] == edges["a"])
-               .groupBy(F.col("u"), F.col("b"))
-               .agg(F.sum("sig").alias("sig"))
-               .select(F.col("u"), F.col("b").alias("v"),
-                       F.lit(r).alias("dist"), F.col("sig")))
-        new = new.join(d.select("u", "v"), ["u", "v"], "left_anti")
-        d = d.unionByName(new).localCheckpoint(eager=False)
-    d.createOrReplaceTempView("q549_d")
-    return spark.sql(
-        f"WITH {_q549_edges_sql('q549_documents')},\n"
-        f"       {_q549_final('q549_d')}")
-
-
-# --- pole of inaccessibility + Zhang-Suen thinning (q550-q551) ---------------------------
-
-_Q550_REG = ("(({y} BETWEEN 2 AND 8 AND {x} BETWEEN 2 AND 21) "
-             "OR ({y} BETWEEN 2 AND 21 AND {x} BETWEEN 2 AND 8))")
-
-
-def _q550_sql(divop: str, mat: str, tbl: str = "documents") -> str:
-    rin = _Q550_REG.format(x="x.x", y="y.x")
-    rob = _Q550_REG.format(x="a.x", y="b.x")
-    return f"""WITH xs AS (SELECT DISTINCT doc_id % 24 AS x FROM {tbl}),
-       xr AS (SELECT x - 1 AS x
-              FROM (SELECT DISTINCT doc_id % 26 AS x FROM {tbl}) t),
-       reg AS{mat} (
-         SELECT x.x AS x, y.x AS y FROM xs x CROSS JOIN xs y
-         WHERE {rin}),
-       obs AS{mat} (
-         SELECT a.x AS x, b.x AS y FROM xr a CROSS JOIN xr b
-         WHERE NOT (a.x BETWEEN 0 AND 23 AND b.x BETWEEN 0 AND 23
-                    AND {rob})),
-       clr AS{mat} (
-         SELECT r.x, r.y,
-                CAST(min((r.x - o.x)*(r.x - o.x)
-                         + (r.y - o.y)*(r.y - o.y)) AS BIGINT) AS c2
-         FROM reg r CROSS JOIN obs o GROUP BY r.x, r.y),
-       pole AS{mat} (
-         SELECT p.* FROM clr p
-         WHERE NOT EXISTS (
-           SELECT 1 FROM clr q
-           WHERE q.c2 > p.c2
-              OR (q.c2 = p.c2 AND q.y*24 + q.x < p.y*24 + p.x))),
-       atmax AS (SELECT CAST(count(*) AS BIGINT) AS n_at_max
-                 FROM clr c JOIN pole p ON c.c2 = p.c2),
-       cent AS (SELECT CAST(sum(x) AS BIGINT) AS sx,
-                       CAST(sum(y) AS BIGINT) AS sy,
-                       CAST(count(*) AS BIGINT) AS nreg
-                FROM reg),
-       ccell AS (SELECT (2*sx + nreg) {divop} (2*nreg) AS cx,
-                        (2*sy + nreg) {divop} (2*nreg) AS cy,
-                        nreg
-                 FROM cent),
-       nd AS{mat} (
-         SELECT o.x AS ox, o.y AS oy,
-                (p.x - o.x)*(p.x - o.x) + (p.y - o.y)*(p.y - o.y)
-                  AS d2
-         FROM pole p CROSS JOIN obs o),
-       nbest AS (SELECT n.* FROM nd n
-                 WHERE NOT EXISTS (
-                   SELECT 1 FROM nd m
-                   WHERE m.d2 < n.d2
-                      OR (m.d2 = n.d2
-                          AND m.oy*26 + m.ox < n.oy*26 + n.ox)))
-       SELECT CAST(p.x AS BIGINT) AS pole_x,
-              CAST(p.y AS BIGINT) AS pole_y,
-              p.c2 AS r2, a.n_at_max,
-              CAST(nb.ox AS BIGINT) AS nearest_obs_x,
-              CAST(nb.oy AS BIGINT) AS nearest_obs_y,
-              CAST(nb.d2 - p.c2 AS BIGINT) AS nearest_resid,
-              c.nreg AS n_region,
-              CAST(c.cx AS BIGINT) AS centroid_cell_x,
-              CAST(c.cy AS BIGINT) AS centroid_cell_y,
-              CAST(CASE WHEN r.x IS NOT NULL THEN 1 ELSE 0 END
-                   AS BIGINT) AS centroid_inside
-       FROM pole p CROSS JOIN atmax a CROSS JOIN ccell c
-       CROSS JOIN nbest nb
-       LEFT JOIN reg r ON r.x = c.cx AND r.y = c.cy"""
-
-
-@query("q550_pole_of_inaccessibility", _q550_sql("//", " MATERIALIZED"))
-def q550(spark, sf_dir):
-    """Pole of inaccessibility / Chebyshev center (the polylabel
-    problem — where to place the label inside a concave polygon;
-    the reference's point-on-surface guarantee, q181, only promises
-    INSIDE, not deepest): the region cell maximizing squared
-    clearance to the nearest non-region cell, with the implicit
-    outside WORLD included as a -1..24 obstacle ring so the raster
-    border genuinely bounds the circle.  Everything is exact
-    BIGINT: clearance is a min of integer squared distances (at
-    raster scale this min is q69's separable EDT; here the 231x445
-    pair join is broadcast scale), the argmax packs the tie rule
-    (lowest y*24+x) and n_at_max == 1 emits uniqueness.  The
-    L-shaped fixture is WHY this operator exists, emitted not
-    narrated: the centroid cell (9,9) of the L lands in the notch —
-    OUTSIDE the region (centroid_inside == 0) — while the pole
-    (6,6) sits in the corner blob at clearance sqrt(18), and the
-    nearest obstacle to the pole is exactly the notch corner (9,9),
-    re-derived independently (nearest_resid == 0 ties the two
-    min-derivations together).  Centroid cell arithmetic is
-    division-free round-half-up, (2*S + n) div (2n)."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q550_documents")
-    return spark.sql(_q550_sql("div", "", "q550_documents"))
-
-
-_Q551_SHAPE = ("(({y} BETWEEN 3 AND 8 AND {x} BETWEEN 2 AND 17) "
-               "OR ({y} BETWEEN 3 AND 16 AND {x} BETWEEN 2 AND 6))")
-
-_Q551_NEIGH = """SELECT a.x, a.y, a.v,
-                CAST(max(CASE WHEN b.x = a.x AND b.y = a.y - 1
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p2,
-                CAST(max(CASE WHEN b.x = a.x + 1 AND b.y = a.y - 1
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p3,
-                CAST(max(CASE WHEN b.x = a.x + 1 AND b.y = a.y
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p4,
-                CAST(max(CASE WHEN b.x = a.x + 1 AND b.y = a.y + 1
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p5,
-                CAST(max(CASE WHEN b.x = a.x AND b.y = a.y + 1
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p6,
-                CAST(max(CASE WHEN b.x = a.x - 1 AND b.y = a.y + 1
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p7,
-                CAST(max(CASE WHEN b.x = a.x - 1 AND b.y = a.y
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p8,
-                CAST(max(CASE WHEN b.x = a.x - 1 AND b.y = a.y - 1
-                         THEN b.v ELSE 0 END) AS BIGINT) AS p9"""
-
-_Q551_A = ("(1-p2)*p3 + (1-p3)*p4 + (1-p4)*p5 + (1-p5)*p6 "
-           "+ (1-p6)*p7 + (1-p7)*p8 + (1-p8)*p9 + (1-p9)*p2")
-
-
-def _q551_del(sub: int) -> str:
-    extra = ("p2*p4*p6 = 0 AND p4*p6*p8 = 0" if sub == 1
-             else "p2*p4*p8 = 0 AND p2*p6*p8 = 0")
-    return (f"CASE WHEN v = 1 AND p2+p3+p4+p5+p6+p7+p8+p9 BETWEEN 2 "
-            f"AND 6 AND {_Q551_A} = 1 AND {extra} THEN 1 ELSE 0 END")
-
-
-def _q551_stage_sql(prev: str, sub: int) -> str:
-    return (f"WITH n AS ({_Q551_NEIGH}\n         FROM {prev} a "
-            f"JOIN {prev} b ON b.x BETWEEN a.x - 1 AND a.x + 1 "
-            f"AND b.y BETWEEN a.y - 1 AND a.y + 1 "
-            f"GROUP BY a.x, a.y, a.v) "
-            f"SELECT x, y, v, CAST({_q551_del(sub)} AS BIGINT) AS del "
-            f"FROM n")
-
-
-def _q551_oracle(tbl: str = "documents", iters: int = 4) -> str:
-    shape = _Q551_SHAPE.format(x="x.x", y="y.x")
-    stages, finals = [], []
-    for k in range(1, 2 * iters + 1):
-        sub = 2 - (k % 2)
-        stages.append(f"""n{k} AS MATERIALIZED (
-         {_Q551_NEIGH}
-         FROM t{k-1} a JOIN t{k-1} b
-           ON b.x BETWEEN a.x - 1 AND a.x + 1
-          AND b.y BETWEEN a.y - 1 AND a.y + 1
-         GROUP BY a.x, a.y, a.v),
-       d{k} AS MATERIALIZED (
-         SELECT x, y, v, CAST({_q551_del(sub)} AS BIGINT) AS del
-         FROM n{k}),
-       t{k} AS MATERIALIZED (
-         SELECT x, y, v - del AS v FROM d{k})""")
-        finals.append(f"""SELECT CAST({k} AS BIGINT) AS stage,
-              CAST({(k + 1) // 2} AS BIGINT) AS iter,
-              CAST({sub} AS BIGINT) AS sub,
-              (SELECT CAST(sum(del) AS BIGINT) FROM d{k})
-                AS n_deleted,
-              (SELECT CAST(sum(v) AS BIGINT) FROM t{k}) AS n_on_after,
-              (SELECT CAST(sum(v) AS BIGINT) FROM t{2*iters})
-                AS skel_on,
-              (SELECT CAST(sum(x*100 + y) AS BIGINT)
-               FROM t{2*iters} WHERE v = 1) AS skel_checksum,
-              (SELECT CAST(count(*) AS BIGINT)
-               FROM t{2*iters} a JOIN t{2*iters} b
-                 ON b.x = a.x + 1 AND b.y = a.y
-               JOIN t{2*iters} c ON c.x = a.x AND c.y = a.y + 1
-               JOIN t{2*iters} d ON d.x = a.x + 1 AND d.y = a.y + 1
-               WHERE a.v = 1 AND b.v = 1 AND c.v = 1 AND d.v = 1)
-                AS n_2x2""")
-    chain = ",\n       ".join(stages)
-    body = "\n       UNION ALL\n       ".join(finals)
-    return f"""WITH xs AS (SELECT DISTINCT doc_id % 20 AS x FROM {tbl}),
-       t0 AS MATERIALIZED (
-         SELECT x.x AS x, y.x AS y,
-                CAST(CASE WHEN {shape} THEN 1 ELSE 0 END AS BIGINT)
-                  AS v
-         FROM xs x CROSS JOIN xs y),
-       {chain}
-       {body}"""
-
-
-@query("q551_zhang_suen_thinning", _q551_oracle())
-def q551(spark, sf_dir):
-    """Zhang-Suen thinning (CACM 1984) — raster skeletonization, the
-    centerline extractor that turns q26's polygonized masks into
-    linework (the raster route to the medial axis): each
-    subiteration deletes boundary pixels where the neighbor count
-    B is in 2..6, the circular 0->1 transition count A equals 1,
-    and the directional products gate which side peels — all
-    deletions applied SIMULTANEOUSLY, which is exactly what makes
-    the pass one neighbor aggregation (the q546 halo shape) instead
-    of a sequential scan.  The engine materializes each
-    subiteration via localCheckpoint + temp view because every
-    stage references its predecessor TWICE (the q521 doubling-chain
-    rule: 8 stages would otherwise re-derive the base 2^8 times);
-    the oracle unrolls the identical expressions as MATERIALIZED
-    stages — the stage SQL text is SHARED, so the two engines run
-    the same arithmetic.  The 6-wide L fixture thins to an 18-px
-    skeleton in 3 working iterations; iteration 4's two stages
-    delete 0 pixels (convergence EMITTED as rows 7-8's n_deleted),
-    and the thinness certificate is structural, not asserted: no
-    2x2 all-on block survives (n_2x2 == 0), plus a position
-    checksum over the final skeleton."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q551_documents")
-    shape = _Q551_SHAPE.format(x="x.x", y="y.x")
-    t0 = spark.sql(
-        f"WITH xs AS (SELECT DISTINCT doc_id % 20 AS x "
-        f"FROM q551_documents) "
-        f"SELECT x.x AS x, y.x AS y, "
-        f"CAST(CASE WHEN {shape} THEN 1 ELSE 0 END AS BIGINT) AS v "
-        f"FROM xs x CROSS JOIN xs y").localCheckpoint()
-    t0.createOrReplaceTempView("q551_t0")
-    rows = []
-    prev = "q551_t0"
-    dks, tks = [], []
-    for k in range(1, 9):
-        sub = 2 - (k % 2)
-        dk = spark.sql(_q551_stage_sql(prev, sub)) \
-            .localCheckpoint(eager=False)
-        tk = dk.select("x", "y",
-                       (F.col("v") - F.col("del")).alias("v")) \
-            .localCheckpoint(eager=False)
-        tk.createOrReplaceTempView(f"q551_t{k}")
-        prev = f"q551_t{k}"
-        dks.append(dk)
-        tks.append(tk)
-    final = tks[-1]
-    certs = spark.sql(
-        "SELECT (SELECT CAST(sum(v) AS BIGINT) FROM q551_t8)"
-        "         AS skel_on, "
-        "(SELECT CAST(sum(x*100 + y) AS BIGINT) FROM q551_t8 "
-        " WHERE v = 1) AS skel_checksum, "
-        "(SELECT CAST(count(*) AS BIGINT) FROM q551_t8 a "
-        " JOIN q551_t8 b ON b.x = a.x + 1 AND b.y = a.y "
-        " JOIN q551_t8 c ON c.x = a.x AND c.y = a.y + 1 "
-        " JOIN q551_t8 d ON d.x = a.x + 1 AND d.y = a.y + 1 "
-        " WHERE a.v = 1 AND b.v = 1 AND c.v = 1 AND d.v = 1) "
-        "  AS n_2x2")
-    out = None
-    for k, (dk, tk) in enumerate(zip(dks, tks), start=1):
-        sub = 2 - (k % 2)
-        row = (dk.groupBy().agg(
-                   F.sum("del").cast("long").alias("n_deleted"))
-               .crossJoin(F.broadcast(
-                   tk.groupBy().agg(F.sum("v").cast("long")
-                                    .alias("n_on_after"))))
-               .select(F.lit(k).cast("long").alias("stage"),
-                       F.lit((k + 1) // 2).cast("long").alias("iter"),
-                       F.lit(sub).cast("long").alias("sub"),
-                       "n_deleted", "n_on_after"))
-        out = row if out is None else out.unionByName(row)
-    return out.crossJoin(F.broadcast(certs))
-
-
-# --- stable matching + ROUGE-L / LCS (q552-q553) -----------------------------------------
-
-
-_Q552_ROUNDS = 13
-
-
-def _q552_base(tbl: str, mat: str) -> str:
-    return (
-        f"ids AS (SELECT DISTINCT doc_id % 11 AS k FROM {tbl}),\n"
-        f"       cub AS (SELECT k, (((k*k) % 11) * k) % 11 AS x3"
-        f" FROM ids),\n"
-        f"       pt AS{mat} (SELECT p.k AS p, i.k AS i,\n"
-        f"         (((p.k % 10) + 1) * c.x3 + ((p.k*p.k + 3) % 11))"
-        f" % 11 AS r\n"
-        f"         FROM ids p CROSS JOIN ids i\n"
-        f"         JOIN cub c ON c.k = (i.k + 2) % 11),\n"
-        f"       rt AS{mat} (SELECT r.k AS r, p.k AS p,\n"
-        f"         ((((3*r.k) % 10) + 1) * c.x3 + ((6*r.k + 5) % 11))"
-        f" % 11 AS rk\n"
-        f"         FROM ids r CROSS JOIN ids p\n"
-        f"         JOIN cub c ON c.k = (p.k + ((r.k*r.k + 1) % 11))"
-        f" % 11),\n"
-        f"       s0 AS (SELECT k AS pid, 0 AS ptr, -1 AS rid,\n"
-        f"                     CAST(0 AS BIGINT) AS nd FROM ids)")
-
-
-def _q552_stage(prev: str, pt: str, rt: str, ca: str, wi: str,
-                mat: str) -> str:
-    return (
-        f"{ca} AS{mat} (SELECT c.r, c.pid, rr.rk FROM (\n"
-        f"           SELECT rid AS r, pid FROM {prev} WHERE rid >= 0\n"
-        f"           UNION ALL\n"
-        f"           SELECT t.r AS r, s2.pid FROM {prev} s2\n"
-        f"           JOIN {pt} t ON t.p = s2.pid AND t.i = s2.ptr\n"
-        f"           WHERE s2.rid = -1 AND s2.ptr < 11) c\n"
-        f"         JOIN {rt} rr ON rr.r = c.r AND rr.p = c.pid),\n"
-        f"       {wi} AS (SELECT r, min(rk) AS wrk FROM {ca}"
-        f" GROUP BY r)")
-
-
-def _q552_next(prev: str, ca: str, wi: str) -> str:
-    return (
-        f"SELECT s.pid,\n"
-        f"         CASE WHEN c.pid IS NULL OR c.rk = w.wrk THEN s.ptr\n"
-        f"              ELSE s.ptr + 1 END AS ptr,\n"
-        f"         CASE WHEN c.pid IS NOT NULL AND c.rk = w.wrk\n"
-        f"              THEN c.r ELSE -1 END AS rid,\n"
-        f"         s.nd + CASE WHEN s.rid >= 0 AND c.rk <> w.wrk\n"
-        f"                THEN 1 ELSE 0 END AS nd\n"
-        f"       FROM {prev} s\n"
-        f"       LEFT JOIN {ca} c ON c.pid = s.pid\n"
-        f"       LEFT JOIN {wi} w ON w.r = c.r")
-
-
-def _q552_final(st: str, pt: str, rt: str, tbl: str) -> str:
-    return (
-        f"mt AS (SELECT f.pid, f.rid, f.nd, t.i AS p_rank,\n"
-        f"              rr.rk AS r_rank\n"
-        f"       FROM {st} f\n"
-        f"       JOIN {pt} t ON t.p = f.pid AND t.r = f.rid\n"
-        f"       JOIN {rt} rr ON rr.r = f.rid AND rr.p = f.pid),\n"
-        f"       blk AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_blocking\n"
-        f"         FROM {pt} x\n"
-        f"         JOIN mt mp ON mp.pid = x.p\n"
-        f"         JOIN mt mr ON mr.rid = x.r\n"
-        f"         JOIN {rt} rr ON rr.r = x.r AND rr.p = x.p\n"
-        f"         WHERE x.r <> mp.rid AND x.i < mp.p_rank\n"
-        f"           AND rr.rk < mr.r_rank),\n"
-        f"       tot AS (SELECT CAST(count(*) AS BIGINT) AS n_matched,\n"
-        f"                      CAST(sum(nd) AS BIGINT) AS n_dumps\n"
-        f"               FROM mt),\n"
-        f"       rej AS (SELECT CAST(sum(ptr) AS BIGINT)"
-        f" AS n_rejections FROM {st}),\n"
-        f"       ld AS (SELECT doc_id % 11 AS r,\n"
-        f"                     CAST(count(*) AS BIGINT) AS host_docs\n"
-        f"              FROM {tbl} GROUP BY doc_id % 11)\n"
-        f"       SELECT CAST(m.pid AS BIGINT) AS crawler,\n"
-        f"              CAST(m.rid AS BIGINT) AS host,\n"
-        f"              CAST(m.p_rank AS BIGINT)"
-        f" AS crawler_rank_of_host,\n"
-        f"              CAST(m.r_rank AS BIGINT)"
-        f" AS host_rank_of_crawler,\n"
-        f"              m.nd AS times_dumped,\n"
-        f"              t.n_matched, t.n_dumps, b.n_blocking,\n"
-        f"              rj.n_rejections, l.host_docs\n"
-        f"       FROM mt m CROSS JOIN tot t CROSS JOIN blk b\n"
-        f"       CROSS JOIN rej rj JOIN ld l ON l.r = m.rid")
-
-
-def _q552_oracle(tbl: str = "documents",
-                 rounds: int = _Q552_ROUNDS) -> str:
-    parts = [_q552_base(tbl, " MATERIALIZED")]
-    for t in range(1, rounds + 1):
-        parts.append(_q552_stage(f"s{t-1}", "pt", "rt", f"ca{t}",
-                                 f"wi{t}", " MATERIALIZED"))
-        parts.append(f"s{t} AS MATERIALIZED (\n"
-                     f"       {_q552_next(f's{t-1}', f'ca{t}', f'wi{t}')})")
-    parts.append(_q552_final(f"s{rounds}", "pt", "rt", tbl))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q552_stable_matching", _q552_oracle())
-def q552(spark, sf_dir):
-    """Gale-Shapley stable matching (deferred acceptance, 1962) —
-    assigning 11 crawler shards to 11 politeness-limited hosts
-    where BOTH sides rank the other (crawlers by expected yield,
-    hosts by trust): the round-synchronous McVitie-Wilson variant
-    in which every free crawler proposes to its next-ranked host
-    and every host keeps the best bid seen so far, dumping its
-    previous holder back into the pool.  Preference permutations
-    are nonlinear bijections mod 11 (x -> x^3 is a bijection since
-    gcd(3, 10) = 1, composed with affine maps — the q458 lesson:
-    affine-only preference structure is degenerately symmetric).
-    The engine runs the REAL DataFrame loop — per round one
-    candidate union (holders + fresh proposals), one min-rank
-    groupBy per host (ranks are a permutation per host, so min IS
-    the unique winner — no tie machinery needed), one LEFT JOIN
-    back to the state; state localCheckpoint'd per round because
-    each round references it three times (the q521 doubling-chain
-    rule) — while the oracle unrolls the IDENTICAL stage SQL text
-    as 13 MATERIALIZED stages (convergence at round 13 measured at
-    design time; the fixture was grid-searched for genuine
-    contention: 6 dump events spread over 6 distinct crawlers, 16
-    rejections total, so the holder-loses branch is alive in the
-    data, not just the code).  THE certificate rides in the output:
-    n_blocking == 0 is the stability theorem verified over all 121
-    pairs from the FINAL matching (a pair blocks iff both prefer
-    each other to their assignments — computed, never assumed),
-    n_matched == 11 certifies convergence (deferred acceptance
-    always perfectly matches equal sides), times_dumped/n_dumps
-    emit the branch-liveness, and host_docs ties each host to its
-    corpus load so the output varies with SF."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q552_documents")
-    base = _q552_base("q552_documents", "")
-    for tv in ("pt", "rt", "s0"):
-        df = spark.sql(f"WITH {base} SELECT * FROM {tv}") \
-            .localCheckpoint()
-        df.createOrReplaceTempView(f"q552_{tv}")
-    prev = "q552_s0"
-    for t in range(1, _Q552_ROUNDS + 1):
-        s = spark.sql(
-            "WITH " + _q552_stage(prev, "q552_pt", "q552_rt",
-                                  "ca", "wi", "") + "\n       "
-            + _q552_next(prev, "ca", "wi")) \
-            .localCheckpoint(eager=False)
-        s.createOrReplaceTempView(f"q552_s{t}")
-        prev = f"q552_s{t}"
-    return spark.sql(
-        "WITH " + _q552_final(prev, "q552_pt", "q552_rt",
-                              "q552_documents"))
-
-
-_Q553_STAGES = 24
-
-_Q553_TA = "(p.pid*5 + ({i}*{i}*3 + {i})) % 8"
-
-
-def _q553_fix(tbl: str, mat: str) -> str:
-    ta_j = _Q553_TA.format(i="s.i")
-    ta_rev = _Q553_TA.format(i="(l.la - 1 - s.i)")
-    ta_2j = _Q553_TA.format(i="(2*s.i)")
-    return (
-        f"ps AS (SELECT DISTINCT doc_id % 13 AS i FROM {tbl}),\n"
-        f"       prs AS (SELECT DISTINCT doc_id % 15 AS pid"
-        f" FROM {tbl}),\n"
-        f"       lens AS (SELECT pid, 8 + ((pid*3) % 5) AS la,\n"
-        f"                  CASE WHEN pid <= 3 THEN 8 + ((pid*3) % 5)\n"
-        f"                       WHEN pid = 4 THEN 5\n"
-        f"                       ELSE 8 + ((pid*7) % 5) END AS lb\n"
-        f"                FROM prs),\n"
-        f"       ta AS{mat} (SELECT p.pid, s.i + 1 AS pos,\n"
-        f"           {ta_j} AS tok\n"
-        f"         FROM prs p JOIN lens l ON l.pid = p.pid\n"
-        f"         JOIN ps s ON s.i < l.la),\n"
-        f"       tb AS{mat} (SELECT p.pid, s.i + 1 AS pos,\n"
-        f"           CASE WHEN p.pid = 0 THEN {ta_j}\n"
-        f"                WHEN p.pid = 1 THEN {ta_rev}\n"
-        f"                WHEN p.pid = 2 THEN {ta_j}\n"
-        f"                  + CASE WHEN s.i % 3 = 0 THEN 100"
-        f" ELSE 0 END\n"
-        f"                WHEN p.pid = 3 THEN {ta_j} + 50\n"
-        f"                WHEN p.pid = 4 THEN {ta_2j}\n"
-        f"                ELSE (p.pid*11 + s.i*s.i*5 + 2*s.i) % 8\n"
-        f"           END AS tok\n"
-        f"         FROM prs p JOIN lens l ON l.pid = p.pid\n"
-        f"         JOIN ps s ON s.i < l.lb)")
-
-
-def _q553_stage_sql(d: int, prev: str, prev2: str) -> str:
-    return (
-        f"SELECT g.pid, g.i, g.j,\n"
-        f"         CASE WHEN g.i = 0 OR g.j = 0 THEN CAST(0 AS BIGINT)\n"
-        f"              ELSE greatest(u.lcs, l2.lcs,\n"
-        f"                     dg.lcs + CASE WHEN x.tok = y.tok\n"
-        f"                              THEN 1 ELSE 0 END) END AS lcs,\n"
-        f"         CASE WHEN g.i = 0 THEN CAST(g.j AS BIGINT)\n"
-        f"              WHEN g.j = 0 THEN CAST(g.i AS BIGINT)\n"
-        f"              ELSE least(u.ind + 1, l2.ind + 1,\n"
-        f"                     dg.ind + CASE WHEN x.tok = y.tok\n"
-        f"                              THEN 0 ELSE 2 END) END AS ind\n"
-        f"       FROM (SELECT p.pid, s.i AS i, {d} - s.i AS j\n"
-        f"             FROM lens p JOIN ps s ON s.i <= p.la\n"
-        f"             WHERE {d} - s.i BETWEEN 0 AND p.lb) g\n"
-        f"       LEFT JOIN {prev} u ON u.pid = g.pid\n"
-        f"         AND u.i = g.i - 1 AND u.j = g.j\n"
-        f"       LEFT JOIN {prev} l2 ON l2.pid = g.pid\n"
-        f"         AND l2.i = g.i AND l2.j = g.j - 1\n"
-        f"       LEFT JOIN {prev2} dg ON dg.pid = g.pid\n"
-        f"         AND dg.i = g.i - 1 AND dg.j = g.j - 1\n"
-        f"       LEFT JOIN ta x ON x.pid = g.pid AND x.pos = g.i\n"
-        f"       LEFT JOIN tb y ON y.pid = g.pid AND y.pos = g.j")
-
-
-def _q553_final(allw: str) -> str:
-    return (
-        f"SELECT CAST(f.pid AS BIGINT) AS pid,\n"
-        f"              CAST(p.la AS BIGINT) AS la,\n"
-        f"              CAST(p.lb AS BIGINT) AS lb,\n"
-        f"              f.lcs, f.ind AS indel,\n"
-        f"              CAST(p.la + p.lb - 2*f.lcs - f.ind AS BIGINT)\n"
-        f"                AS indel_identity_resid,\n"
-        f"              CAST(CASE WHEN f.lcs <= least(p.la, p.lb)\n"
-        f"                   THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS lcs_bounded,\n"
-        f"              CAST(2*f.lcs AS DOUBLE) / (p.la + p.lb)\n"
-        f"                AS rouge_l_f1\n"
-        f"       FROM {allw} f JOIN lens p ON p.pid = f.pid\n"
-        f"         AND f.i = p.la AND f.j = p.lb")
-
-
-def _q553_oracle(tbl: str = "documents",
-                 stages: int = _Q553_STAGES) -> str:
-    parts = [_q553_fix(tbl, " MATERIALIZED"),
-             "w0 AS (SELECT pid, 0 AS i, 0 AS j,"
-             " CAST(0 AS BIGINT) AS lcs, CAST(0 AS BIGINT) AS ind"
-             " FROM prs)"]
-    for d in range(1, stages + 1):
-        prev2 = f"w{d-2}" if d >= 2 else "w0"
-        parts.append(f"w{d} AS MATERIALIZED (\n"
-                     f"       {_q553_stage_sql(d, f'w{d-1}', prev2)})")
-    union = "\n         UNION ALL ".join(
-        f"SELECT * FROM w{d}" for d in range(13, stages + 1))
-    parts.append(f"allw AS ({union})")
-    return ("WITH " + ",\n       ".join(parts) + "\n       "
-            + _q553_final("allw"))
-
-
-@query("q553_rouge_l_lcs", _q553_oracle())
-def q553(spark, sf_dir):
-    """ROUGE-L (Lin 2004) — the LCS-based summary-evaluation metric
-    that completes the eval family (BLEU q414, chrF q455): per
-    candidate/reference pair the longest common subsequence, the
-    F1 = 2*LCS/(m+n) score as ONE float division of exact BIGINTs,
-    AND the indel edit distance computed by its own independent DP
-    — because for insert/delete-only costs the two are linked by
-    the EXACT identity D = m + n - 2*LCS, emitted per pair as
-    indel_identity_resid == 0: two different dynamic programs
-    certifying each other.  The plants make each regime live:
-    pair 0 identical (F1 = 1), pair 1 REVERSED (LCS becomes the
-    longest palindromic subsequence, 8 of 11 — order sensitivity a
-    set metric can't see, the q525 story transplanted to tokens),
-    pair 2 every-3rd-token substituted (subs cost 2 under indel),
-    pair 3 disjoint vocabularies (LCS = 0, D = m + n), pair 4 a
-    pure subsequence (LCS = |B|).  ENGINE: the DP is genuinely
-    sequential per pair — one applyInPandas over 15 pair groups,
-    exact int64 (the q525/q470 per-entity recurrence template);
-    ORACLE: 24 antidiagonal wavefront stages, each MATERIALIZED and
-    reading only stages d-1/d-2 (the doubling-trap rule), finals
-    picked per pair from its own la+lb diagonal."""
-    import pandas as pd
-
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q553_documents")
-    fix = _q553_fix("q553_documents", "")
-    toks = spark.sql(
-        f"WITH {fix} "
-        f"SELECT a.pid, a.pos, a.tok, 0 AS side FROM ta a "
-        f"UNION ALL SELECT b.pid, b.pos, b.tok, 1 AS side FROM tb b")
-
-    def dp(key, g: pd.DataFrame) -> pd.DataFrame:
-        a = g[g.side == 0].sort_values("pos").tok.tolist()
-        b = g[g.side == 1].sort_values("pos").tok.tolist()
-        m, n = len(a), len(b)
-        L = [[0] * (n + 1) for _ in range(m + 1)]
-        D = [[0] * (n + 1) for _ in range(m + 1)]
-        for i in range(m + 1):
-            D[i][0] = i
-        for j in range(n + 1):
-            D[0][j] = j
-        for i in range(1, m + 1):
-            for j in range(1, n + 1):
-                eq = a[i - 1] == b[j - 1]
-                L[i][j] = max(L[i - 1][j], L[i][j - 1],
-                              L[i - 1][j - 1] + (1 if eq else 0))
-                D[i][j] = min(D[i - 1][j] + 1, D[i][j - 1] + 1,
-                              D[i - 1][j - 1] + (0 if eq else 2))
-        lcs, ind = L[m][n], D[m][n]
-        return pd.DataFrame(
-            {"pid": [int(key[0])], "la": [m], "lb": [n],
-             "lcs": [lcs], "indel": [ind],
-             "indel_identity_resid": [m + n - 2 * lcs - ind],
-             "lcs_bounded": [1 if lcs <= min(m, n) else 0],
-             "rouge_l_f1": [2 * lcs / (m + n)]})
-
-    return toks.groupBy("pid").applyInPandas(
-        dp, "pid long, la long, lb long, lcs long, indel long, "
-            "indel_identity_resid long, lcs_bounded long, "
-            "rouge_l_f1 double")
-
-
-# --- Walsh-Hadamard sketch + least-cost path (q554-q555) ---------------------------------
-
-
-def _q554_fix(tbl: str) -> str:
-    return (
-        f"gs AS (SELECT DISTINCT doc_id % 12 AS g FROM {tbl}),\n"
-        f"       idx AS (SELECT DISTINCT doc_id % 16 AS i"
-        f" FROM {tbl}),\n"
-        f"       h0 AS (SELECT g.g, i.i,\n"
-        f"                CAST(((g.g*7 + i.i*i.i*5 + i.i) % 19) - 9\n"
-        f"                     AS BIGINT) AS v\n"
-        f"              FROM gs g CROSS JOIN idx i)")
-
-
-def _q554_stage(prev: str, s: int, divop: str) -> str:
-    p2 = 1 << (s % 4)
-    return (
-        f"SELECT a.g, a.i,\n"
-        f"         (1 - 2*((a.i {divop} {p2}) % 2)) * a.v + b.v AS v\n"
-        f"       FROM {prev} a JOIN {prev} b ON b.g = a.g\n"
-        f"        AND b.i = a.i + (1 - 2*((a.i {divop} {p2}) % 2))"
-        f" * {p2}")
-
-
-def _q554_final(h0: str, h4: str, h8: str, tbl: str,
-                divop: str) -> str:
-    return (
-        f"xs AS (SELECT g, CAST(sum(v) AS BIGINT) AS sum_x,\n"
-        f"               CAST(sum(v*v) AS BIGINT) AS sum_x2\n"
-        f"        FROM {h0} GROUP BY g),\n"
-        f"       ys AS (SELECT g, CAST(sum(v*v) AS BIGINT) AS energy,\n"
-        f"                CAST(min(CASE WHEN i = 0 THEN v END)\n"
-        f"                     AS BIGINT) AS dc,\n"
-        f"                CAST(min(-abs(v)*16 - (15 - i)) AS BIGINT)\n"
-        f"                  AS peak_key\n"
-        f"              FROM {h4} GROUP BY g),\n"
-        f"       rt AS (SELECT z.g,\n"
-        f"                CAST(sum(abs(z.v - 16*x.v)) AS BIGINT)\n"
-        f"                  AS roundtrip_resid\n"
-        f"              FROM {h8} z JOIN {h0} x ON x.g = z.g\n"
-        f"               AND x.i = z.i\n"
-        f"              GROUP BY z.g),\n"
-        f"       ld AS (SELECT doc_id % 12 AS g,\n"
-        f"                CAST(count(*) AS BIGINT) AS group_docs\n"
-        f"              FROM {tbl} GROUP BY doc_id % 12)\n"
-        f"       SELECT CAST(y.g AS BIGINT) AS grp, y.dc, y.energy,\n"
-        f"              CAST(y.dc - x.sum_x AS BIGINT) AS dc_resid,\n"
-        f"              CAST(y.energy - 16*x.sum_x2 AS BIGINT)\n"
-        f"                AS parseval_resid,\n"
-        f"              r.roundtrip_resid,\n"
-        f"              CAST((-y.peak_key) {divop} 16 AS BIGINT)\n"
-        f"                AS peak_abs,\n"
-        f"              CAST(15 - ((-y.peak_key) % 16) AS BIGINT)\n"
-        f"                AS peak_idx,\n"
-        f"              l.group_docs\n"
-        f"       FROM ys y JOIN xs x ON x.g = y.g\n"
-        f"       JOIN rt r ON r.g = y.g JOIN ld l ON l.g = y.g")
-
-
-def _q554_oracle(tbl: str = "documents") -> str:
-    parts = [_q554_fix(tbl)]
-    for s in range(8):
-        parts.append(f"h{s+1} AS MATERIALIZED (\n"
-                     f"       {_q554_stage(f'h{s}', s, '//')})")
-    parts.append(_q554_final("h0", "h4", "h8", tbl, "//"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q554_walsh_hadamard", _q554_oracle())
-def q554(spark, sf_dir):
-    """Walsh-Hadamard transform — the structured projection inside
-    SRHT sketching (Ailon-Chazelle fast JL: rotate with H, then
-    subsample — the preconditioner that makes q495's feature
-    hashing and q365's binary embeddings work on adversarial
-    inputs) and the codebook of Hadamard error-correcting codes.
-    All EXACT integers: 12 vectors of length 16, each butterfly
-    stage ONE self-join on the partner index i +/- 2^s (partner and
-    sign derived by integer div/mod — no XOR, whose operator `^`
-    means POWER in DuckDB), the engine materializing each stage via
-    localCheckpoint + temp view because every stage references its
-    predecessor TWICE (the q521 doubling-chain rule), the oracle
-    unrolling the IDENTICAL stage text as 8 MATERIALIZED stages.
-    Three theorems ride the output, computed never assumed:
-    dc_resid == 0 (coefficient 0 IS the sequence sum),
-    parseval_resid == 0 (sum y^2 = 16 * sum x^2 — the energy-
-    preservation that makes the sketch distance-preserving), and
-    roundtrip_resid == 0 (stages 5-8 run the SAME butterflies on
-    the spectrum and land on exactly 16x — the transform is its own
-    inverse up to scale, which is WHY the inverse costs nothing at
-    serving time).  The peak coefficient + index are argmaxed with
-    the tie rule packed (abs*16 + reversed index -> min), and
-    group_docs ties each vector to its corpus load."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q554_documents")
-    h = spark.sql(
-        f"WITH {_q554_fix('q554_documents')} SELECT * FROM h0") \
-        .localCheckpoint()
-    h.createOrReplaceTempView("q554_h0")
-    for s in range(8):
-        h = spark.sql(
-            _q554_stage(f"q554_h{s}", s, "div")).localCheckpoint(
-                eager=False)
-        h.createOrReplaceTempView(f"q554_h{s+1}")
-    return spark.sql(
-        "WITH " + _q554_final("q554_h0", "q554_h4", "q554_h8",
-                              "q554_documents", "div"))
-
-
-_Q555_SEEDS = ("(d.gx = 0 AND d.gy = 0) OR (d.gx = 11 AND d.gy = 9)")
-
-
-def _q555_base(tbl: str, divop: str, mat: str) -> str:
-    return (
-        f"cells AS (SELECT DISTINCT doc_id % 120 AS c FROM {tbl}),\n"
-        f"       grid AS{mat} (\n"
-        f"         SELECT c % 12 AS gx, c {divop} 12 AS gy,\n"
-        f"                1 + ((c % 12)*7 + (c {divop} 12)*11\n"
-        f"                     + (c % 12)*(c {divop} 12)) % 5 AS w\n"
-        f"         FROM cells),\n"
-        f"       d0 AS{mat} (\n"
-        f"         SELECT gx, gy, w,\n"
-        f"                CAST(CASE WHEN gx = 0 AND gy = 0 THEN 0\n"
-        f"                     WHEN gx = 11 AND gy = 9 THEN 1\n"
-        f"                     ELSE 99999999 END AS BIGINT) AS k\n"
-        f"         FROM grid)")
-
-
-def _q555_relax(prev: str, divop: str) -> str:
-    return (
-        f"SELECT g.gx, g.gy, g.w,\n"
-        f"         least(p.k, coalesce(min((n.k {divop} 4096 + g.w)"
-        f" * 4096\n"
-        f"                                 + n.k % 4096), p.k)) AS k\n"
-        f"       FROM grid g\n"
-        f"       JOIN {prev} p ON p.gx = g.gx AND p.gy = g.gy\n"
-        f"       LEFT JOIN {prev} n\n"
-        f"         ON abs(n.gx - g.gx) + abs(n.gy - g.gy) = 1\n"
-        f"        AND n.k < 99999999\n"
-        f"       GROUP BY g.gx, g.gy, g.w, p.k")
-
-
-def _q555_post(dF: str, divop: str, mat: str) -> str:
-    return (
-        f"j1 AS{mat} (\n"
-        f"         SELECT d.gy*12 + d.gx AS cid,\n"
-        f"                CASE WHEN {_Q555_SEEDS}\n"
-        f"                     THEN d.gy*12 + d.gx\n"
-        f"                     ELSE min(n.k*128 + n.gy*12 + n.gx)"
-        f" % 128\n"
-        f"                END AS pid\n"
-        f"         FROM {dF} d\n"
-        f"         LEFT JOIN {dF} n\n"
-        f"           ON abs(n.gx - d.gx) + abs(n.gy - d.gy) = 1\n"
-        f"         GROUP BY d.gx, d.gy),\n"
-        f"       j2 AS{mat} (SELECT a.cid, b.pid FROM j1 a\n"
-        f"         JOIN j1 b ON b.cid = a.pid),\n"
-        f"       j4 AS{mat} (SELECT a.cid, b.pid FROM j2 a\n"
-        f"         JOIN j2 b ON b.cid = a.pid),\n"
-        f"       j8 AS{mat} (SELECT a.cid, b.pid FROM j4 a\n"
-        f"         JOIN j4 b ON b.cid = a.pid),\n"
-        f"       p0 AS (SELECT cid, 0 AS pos FROM j1 WHERE cid = 77),\n"
-        f"       p1 AS{mat} (SELECT cid, pos FROM p0 UNION ALL\n"
-        f"         SELECT j.pid AS cid, p.pos + 1 AS pos\n"
-        f"         FROM p0 p JOIN j1 j ON j.cid = p.cid),\n"
-        f"       p2 AS{mat} (SELECT cid, pos FROM p1 UNION ALL\n"
-        f"         SELECT j.pid AS cid, p.pos + 2 AS pos\n"
-        f"         FROM p1 p JOIN j2 j ON j.cid = p.cid),\n"
-        f"       p3 AS{mat} (SELECT cid, pos FROM p2 UNION ALL\n"
-        f"         SELECT j.pid AS cid, p.pos + 4 AS pos\n"
-        f"         FROM p2 p JOIN j4 j ON j.cid = p.cid),\n"
-        f"       p4 AS{mat} (SELECT cid, pos FROM p3 UNION ALL\n"
-        f"         SELECT j.pid AS cid, p.pos + 8 AS pos\n"
-        f"         FROM p3 p JOIN j8 j ON j.cid = p.cid),\n"
-        f"       orbit AS (SELECT cid, CAST(min(pos) AS BIGINT)"
-        f" AS pos\n"
-        f"                 FROM p4 GROUP BY cid),\n"
-        f"       path AS{mat} (\n"
-        f"         SELECT o.pos, d.gx, d.gy, d.w,\n"
-        f"                d.k {divop} 4096 AS cost, d.k % 4096 AS src\n"
-        f"         FROM orbit o\n"
-        f"         JOIN {dF} d ON d.gy*12 + d.gx = o.cid),\n"
-        f"       nbmin AS (SELECT d.gy*12 + d.gx AS cid,\n"
-        f"                        min(n.k) AS mnk\n"
-        f"                 FROM {dF} d JOIN {dF} n\n"
-        f"                   ON abs(n.gx - d.gx) + abs(n.gy - d.gy)"
-        f" = 1\n"
-        f"                 GROUP BY d.gx, d.gy),\n"
-        f"       nbties AS{mat} (\n"
-        f"         SELECT m.cid, CAST(count(*) AS BIGINT) AS nmin\n"
-        f"         FROM nbmin m\n"
-        f"         JOIN {dF} d ON d.gy*12 + d.gx = m.cid\n"
-        f"         JOIN {dF} n ON abs(n.gx - d.gx)"
-        f" + abs(n.gy - d.gy) = 1\n"
-        f"          AND n.k = m.mnk\n"
-        f"         GROUP BY m.cid),\n"
-        f"       plen AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS path_len,\n"
-        f"                       CAST(max(pos) AS BIGINT) AS maxpos\n"
-        f"                FROM path),\n"
-        f"       tgt AS (SELECT CAST(cost AS BIGINT) AS total_cost\n"
-        f"               FROM path WHERE pos = 0),\n"
-        f"       cw AS (SELECT CAST(sum(p.w) AS BIGINT) AS sum_w\n"
-        f"              FROM path p CROSS JOIN plen\n"
-        f"              WHERE p.pos < plen.maxpos),\n"
-        f"       ties AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_tie_cells\n"
-        f"                FROM path p\n"
-        f"                JOIN nbties t ON t.cid = p.gy*12 + p.gx\n"
-        f"                CROSS JOIN plen\n"
-        f"                WHERE t.nmin >= 2 AND p.pos < plen.maxpos),\n"
-        f"       cv AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS improvable\n"
-        f"              FROM (SELECT g.gx, g.gy,\n"
-        f"                      least(p.k, coalesce(\n"
-        f"                        min((n.k {divop} 4096 + g.w)*4096\n"
-        f"                            + n.k % 4096), p.k)) AS k2,"
-        f" p.k\n"
-        f"                    FROM grid g\n"
-        f"                    JOIN {dF} p ON p.gx = g.gx"
-        f" AND p.gy = g.gy\n"
-        f"                    LEFT JOIN {dF} n\n"
-        f"                      ON abs(n.gx - g.gx)"
-        f" + abs(n.gy - g.gy) = 1\n"
-        f"                     AND n.k < 99999999\n"
-        f"                    GROUP BY g.gx, g.gy, g.w, p.k) x\n"
-        f"              WHERE x.k2 <> x.k)\n"
-        f"       SELECT p.pos, CAST(p.gx AS BIGINT) AS gx,\n"
-        f"              CAST(p.gy AS BIGINT) AS gy,\n"
-        f"              CAST(p.w AS BIGINT) AS w,\n"
-        f"              CAST(p.cost AS BIGINT) AS cost,\n"
-        f"              CAST(p.src AS BIGINT) AS src,\n"
-        f"              CAST(CASE WHEN nx.pos IS NULL THEN 0\n"
-        f"                   ELSE p.cost - nx.cost - p.w END"
-        f" AS BIGINT) AS step_resid,\n"
-        f"              CAST(CASE WHEN nx.pos IS NULL\n"
-        f"                   OR p.cost > nx.cost THEN 1 ELSE 0 END\n"
-        f"                   AS BIGINT) AS strictly_decreasing,\n"
-        f"              pl.path_len, t.total_cost,\n"
-        f"              CAST(t.total_cost - c.sum_w AS BIGINT)\n"
-        f"                AS conservation_resid,\n"
-        f"              ti.n_tie_cells, cv.improvable AS conv_resid\n"
-        f"       FROM path p LEFT JOIN path nx ON nx.pos = p.pos + 1\n"
-        f"       CROSS JOIN plen pl CROSS JOIN tgt t CROSS JOIN cw c\n"
-        f"       CROSS JOIN ties ti CROSS JOIN cv")
-
-
-def _q555_oracle(tbl: str = "documents", rounds: int = 12) -> str:
-    parts = [_q555_base(tbl, "//", " MATERIALIZED")]
-    for r in range(1, rounds + 1):
-        parts.append(f"d{r} AS MATERIALIZED (\n"
-                     f"       {_q555_relax(f'd{r-1}', '//')})")
-    parts.append(_q555_post(f"d{rounds}", "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q555_least_cost_path", _q555_oracle())
-def q555(spark, sf_dir):
-    """Least-cost PATH extraction — the half of GRASS r.cost /
-    r.drain that q517 left on the table: q517 computes the cost
-    FIELD; a route planner needs the actual polyline.  Same
-    re-pinned round-synchronous Jacobi spec over a fresh 12x10
-    friction surface (packed key cost*4096 + seed, 12 rounds
-    measured at design time, 13th-round improvable EMITTED as
-    conv_resid == 0); then the backtrack is made RELATIONAL in
-    O(log L) instead of L sequential steps: every cell computes its
-    steepest-descent parent in ONE neighbor aggregation (min of
-    n.k*128 + position — the packed-tie-rule idiom: min IS
-    'smallest cost, then smallest seed, then lowest cell id'),
-    parents compose into 2/4/8-step jump tables by pointer doubling
-    (the q521 watershed machinery aimed at a path), and the orbit
-    of the target unrolls with EXACT positions: P_{k+1} = P_k union
-    jump_{2^k}(P_k) reaches parent^m for every m < 16 with pos
-    arithmetic, min(pos) per cell de-duplicating the seed's
-    fixpoint tail.  The emitted path is self-certifying: per-row
-    step_resid == 0 re-derives d(c) = d(parent) + w(c) from the
-    final field, conservation_resid == 0 proves sum of w along the
-    path equals the target's accumulated cost (the telescoped
-    identity, derived independently), strictly_decreasing == 1 on
-    every row, and n_tie_cells == 2 emits that the position
-    tiebreak genuinely fired (2 path cells have two neighbors at
-    the identical packed minimum).  The design-chosen target (5,6)
-    takes a 12-cell, 6-turn route to seed 0 at cost 26.
-
-    Round-5 engine restructure (the r4 verdict's #2): the twelve
-    per-round localCheckpoints (29 s of driver latency at sf0.1)
-    are replaced by the zero-cost SELF-LOOP idiom (q741): with a
-    broadcast edge table E = 4-neighbors + a self edge per cell,
-    one relax round is a single-reference join + grouped min, so
-    all 12 rounds chain in ONE spark.sql with a linear Catalyst
-    tree.  d12 and the parent map j1 are pinned once
-    (fixture-bounded, 120 rows), the 16-step orbit walks the
-    pinned 120-entry parent map driver-side (the polygonize
-    small-label-graph pattern), and the certification aggregates
-    run as one final statement — 4 jobs total instead of ~25."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q555_documents")
-    base = _q555_base("q555_documents", "div", "")
-    _pin_view(spark, f"WITH {base} SELECT * FROM grid",
-              "q555_grid", max_rows=130)
-    gpdf = spark.table("q555_grid").toPandas()
-    cells = {(int(r.gx), int(r.gy)): int(r.w)
-             for r in gpdf.itertuples()}
-    edges = []           # (gx, gy, w, sx, sy, kind) kind 0 = self
-    for (gx, gy), w in cells.items():
-        edges.append((gx, gy, w, gx, gy, 0))
-        for nx, ny in ((gx - 1, gy), (gx + 1, gy),
-                       (gx, gy - 1), (gx, gy + 1)):
-            if (nx, ny) in cells:
-                edges.append((gx, gy, w, nx, ny, 1))
-    local_df(spark, edges,
-             "gx long, gy long, w long, sx long, sy long,"
-             " kind int").createOrReplaceTempView("q555_edges")
-    relax = (
-        "SELECT e.gx, e.gy, e.w,\n"
-        "         min(CASE WHEN e.kind = 0 THEN p.k\n"
-        "                  WHEN p.k < 99999999\n"
-        "                  THEN (p.k div 4096 + e.w) * 4096\n"
-        "                       + p.k % 4096 END) AS k\n"
-        "       FROM q555_edges e\n"
-        "       JOIN {prev} p ON p.gx = e.sx AND p.gy = e.sy\n"
-        "       GROUP BY e.gx, e.gy, e.w")
-    d0 = ("SELECT gx, gy, w,\n"
-          "         CAST(CASE WHEN gx = 0 AND gy = 0 THEN 0\n"
-          "              WHEN gx = 11 AND gy = 9 THEN 1\n"
-          "              ELSE 99999999 END AS BIGINT) AS k\n"
-          "       FROM q555_grid")
-    parts = [f"d0 AS (\n       {d0})"]
-    for r in range(1, 13):
-        parts.append(f"d{r} AS (\n"
-                     f"       {relax.format(prev=f'd{r-1}')})")
-    chain = "WITH " + ",\n       ".join(parts) + " SELECT * FROM d12"
-    _pin_view(spark, chain, "q555_d12", max_rows=130)
-    j1 = ("SELECT d.gy*12 + d.gx AS cid,\n"
-          f"         CASE WHEN {_Q555_SEEDS}\n"
-          "              THEN d.gy*12 + d.gx\n"
-          "              ELSE min(n.k*128 + n.gy*12 + n.gx) % 128\n"
-          "         END AS pid\n"
-          "       FROM q555_d12 d\n"
-          "       LEFT JOIN q555_d12 n\n"
-          "         ON abs(n.gx - d.gx) + abs(n.gy - d.gy) = 1\n"
-          "       GROUP BY d.gx, d.gy")
-    _pin_view(spark, j1, "q555_j1", max_rows=130)
-    parent = {int(r.cid): int(r.pid)
-              for r in spark.table("q555_j1").toPandas()
-              .itertuples()}
-    orbit, cur = {}, 77
-    for pos in range(16):
-        if cur not in orbit:
-            orbit[cur] = pos
-        cur = parent[cur]
-    local_df(spark, sorted(orbit.items()), "cid long, pos long") \
-        .createOrReplaceTempView("q555_orbit")
-    fin = (
-        "path AS (\n"
-        "         SELECT o.pos, d.gx, d.gy, d.w,\n"
-        "                d.k div 4096 AS cost, d.k % 4096 AS src\n"
-        "         FROM q555_orbit o\n"
-        "         JOIN q555_d12 d ON d.gy*12 + d.gx = o.cid),\n"
-        "       nbmin AS (SELECT d.gy*12 + d.gx AS cid,\n"
-        "                        min(n.k) AS mnk\n"
-        "                 FROM q555_d12 d JOIN q555_d12 n\n"
-        "                   ON abs(n.gx - d.gx) + abs(n.gy - d.gy)"
-        " = 1\n"
-        "                 GROUP BY d.gx, d.gy),\n"
-        "       nbties AS (\n"
-        "         SELECT m.cid, CAST(count(*) AS BIGINT) AS nmin\n"
-        "         FROM nbmin m\n"
-        "         JOIN q555_d12 d ON d.gy*12 + d.gx = m.cid\n"
-        "         JOIN q555_d12 n ON abs(n.gx - d.gx)"
-        " + abs(n.gy - d.gy) = 1\n"
-        "          AND n.k = m.mnk\n"
-        "         GROUP BY m.cid),\n"
-        "       plen AS (SELECT CAST(count(*) AS BIGINT)"
-        " AS path_len,\n"
-        "                       CAST(max(pos) AS BIGINT) AS maxpos\n"
-        "                FROM path),\n"
-        "       tgt AS (SELECT CAST(cost AS BIGINT) AS total_cost\n"
-        "               FROM path WHERE pos = 0),\n"
-        "       cw AS (SELECT CAST(sum(p.w) AS BIGINT) AS sum_w\n"
-        "              FROM path p CROSS JOIN plen\n"
-        "              WHERE p.pos < plen.maxpos),\n"
-        "       ties AS (SELECT CAST(count(*) AS BIGINT)"
-        " AS n_tie_cells\n"
-        "                FROM path p\n"
-        "                JOIN nbties t ON t.cid = p.gy*12 + p.gx\n"
-        "                CROSS JOIN plen\n"
-        "                WHERE t.nmin >= 2 AND p.pos < plen.maxpos),\n"
-        "       cv AS (SELECT CAST(count(*) AS BIGINT)"
-        " AS improvable\n"
-        "              FROM (SELECT g.gx, g.gy,\n"
-        "                      least(p.k, coalesce(\n"
-        "                        min((n.k div 4096 + g.w)*4096\n"
-        "                            + n.k % 4096), p.k)) AS k2,"
-        " p.k\n"
-        "                    FROM q555_grid g\n"
-        "                    JOIN q555_d12 p ON p.gx = g.gx"
-        " AND p.gy = g.gy\n"
-        "                    LEFT JOIN q555_d12 n\n"
-        "                      ON abs(n.gx - g.gx)"
-        " + abs(n.gy - g.gy) = 1\n"
-        "                     AND n.k < 99999999\n"
-        "                    GROUP BY g.gx, g.gy, g.w, p.k) x\n"
-        "              WHERE x.k2 <> x.k)\n"
-        "       SELECT p.pos, CAST(p.gx AS BIGINT) AS gx,\n"
-        "              CAST(p.gy AS BIGINT) AS gy,\n"
-        "              CAST(p.w AS BIGINT) AS w,\n"
-        "              CAST(p.cost AS BIGINT) AS cost,\n"
-        "              CAST(p.src AS BIGINT) AS src,\n"
-        "              CAST(CASE WHEN nx.pos IS NULL THEN 0\n"
-        "                   ELSE p.cost - nx.cost - p.w END"
-        " AS BIGINT) AS step_resid,\n"
-        "              CAST(CASE WHEN nx.pos IS NULL\n"
-        "                   OR p.cost > nx.cost THEN 1 ELSE 0 END\n"
-        "                   AS BIGINT) AS strictly_decreasing,\n"
-        "              pl.path_len, t.total_cost,\n"
-        "              CAST(t.total_cost - c.sum_w AS BIGINT)\n"
-        "                AS conservation_resid,\n"
-        "              ti.n_tie_cells, cv.improvable AS conv_resid\n"
-        "       FROM path p LEFT JOIN path nx ON nx.pos = p.pos + 1\n"
-        "       CROSS JOIN plen pl CROSS JOIN tgt t CROSS JOIN cw c\n"
-        "       CROSS JOIN ties ti CROSS JOIN cv")
-    return spark.sql("WITH " + fin)
-
-
-# --- Visvalingam simplification + Adler-32 checksum (q556-q557) --------------------------
-
-
-def _q556_fix(tbl: str) -> str:
-    return (
-        f"s0 AS (SELECT i AS pos, i*4 AS x,\n"
-        f"         CASE WHEN i BETWEEN 3 AND 7 THEN 2\n"
-        f"              WHEN i = 12 THEN 25\n"
-        f"              WHEN i BETWEEN 16 AND 20 THEN i % 2\n"
-        f"              ELSE ((i*i*7 + i*3) % 9) - 4 END AS y\n"
-        f"       FROM (SELECT DISTINCT doc_id % 24 AS i"
-        f" FROM {tbl}) t)")
-
-
-_Q556_AREAS = (
-    "SELECT pos, x, y,\n"
-    "           CASE WHEN lag(pos) OVER (ORDER BY pos) IS NULL\n"
-    "                  OR lead(pos) OVER (ORDER BY pos) IS NULL\n"
-    "                THEN NULL\n"
-    "                ELSE abs((x - lag(x) OVER (ORDER BY pos))\n"
-    "                    * (lead(y) OVER (ORDER BY pos)\n"
-    "                       - lag(y) OVER (ORDER BY pos))\n"
-    "                    - (lead(x) OVER (ORDER BY pos)\n"
-    "                       - lag(x) OVER (ORDER BY pos))\n"
-    "                    * (y - lag(y) OVER (ORDER BY pos)))\n"
-    "           END AS a2\n"
-    "         FROM {prev}")
-
-_Q556_KEYS = (
-    "SELECT pos, x, y, a2, a2*64 + pos AS k,\n"
-    "           lag(a2*64 + pos) OVER (ORDER BY pos) AS lk,\n"
-    "           lead(a2*64 + pos) OVER (ORDER BY pos) AS rk\n"
-    "         FROM ({areas}) t")
-
-
-def _q556_stage(prev: str) -> str:
-    areas = _Q556_AREAS.format(prev=prev)
-    keys = _Q556_KEYS.format(areas=areas)
-    return (
-        f"SELECT pos, x, y FROM ({keys}) u\n"
-        f"       WHERE a2 IS NULL OR a2 >= 24\n"
-        f"          OR NOT (k < coalesce(lk, 99999999)\n"
-        f"                  AND k < coalesce(rk, 99999999))")
-
-
-def _q556_final(pre: str) -> str:
-    areas = _Q556_AREAS.format(prev=f"{pre}6")
-    keys = _Q556_KEYS.format(areas=areas)
-    csub = ", ".join(
-        f"(SELECT count(*) FROM {pre}{r}) AS c{r}" for r in range(7))
-    return (
-        f"cnts AS (SELECT {csub}),\n"
-        f"       fin AS ({keys}),\n"
-        f"       fx AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS fixpoint_resid\n"
-        f"              FROM fin WHERE a2 IS NOT NULL AND a2 < 24\n"
-        f"                AND k < coalesce(lk, 99999999)\n"
-        f"                AND k < coalesce(rk, 99999999))\n"
-        f"       SELECT CAST(f.pos AS BIGINT) AS pos,\n"
-        f"              CAST(f.x AS BIGINT) AS x,\n"
-        f"              CAST(f.y AS BIGINT) AS y,\n"
-        f"              CAST(coalesce(f.a2, -1) AS BIGINT)"
-        f" AS final_area2,\n"
-        f"              CAST(c.c6 AS BIGINT) AS n_survivors,\n"
-        f"              CAST(c.c0 - c.c6 AS BIGINT) AS removed_total,\n"
-        f"              CAST((c.c0 - c.c1) + (c.c1 - c.c2)*100\n"
-        f"                   + (c.c2 - c.c3)*10000\n"
-        f"                   + (c.c3 - c.c4)*1000000\n"
-        f"                   + (c.c4 - c.c5)*100000000\n"
-        f"                   + (c.c5 - c.c6)*10000000000 AS BIGINT)\n"
-        f"                AS removals_history,\n"
-        f"              CAST(c.c5 - c.c6 AS BIGINT)"
-        f" AS last_round_removed,\n"
-        f"              x2.fixpoint_resid\n"
-        f"       FROM fin f CROSS JOIN cnts c CROSS JOIN fx x2")
-
-
-def _q556_oracle(tbl: str = "documents") -> str:
-    parts = [_q556_fix(tbl)]
-    for r in range(1, 7):
-        parts.append(f"s{r} AS MATERIALIZED (\n"
-                     f"       {_q556_stage(f's{r-1}')})")
-    parts.append(_q556_final("s"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q556_visvalingam", _q556_oracle())
-def q556(spark, sf_dir):
-    """Visvalingam-Whyatt line simplification (1993) — the
-    effective-area alternative to q111's Douglas-Peucker (DP keeps
-    shape extremes by offset; VW removes the least-VISIBLE vertex
-    by triangle area — cartography's preferred generalizer).  The
-    textbook algorithm is a sequential heap loop; the spec here is
-    RE-PINNED round-synchronous first (the sieve lesson): per round
-    every interior vertex computes its effective area (2x, exact
-    integer cross product) with its CURRENT surviving neighbors,
-    and a vertex is removed iff it is below threshold AND its
-    packed key area2*64 + pos is strictly smaller than BOTH
-    neighbors' keys — keys are distinct, so two adjacent vertices
-    can never be removed in the same round (the correctness trap of
-    naive parallel VW, killed by construction), and a collinear run
-    drains deterministically one-per-round from the lowest
-    position.  Engine: per-round window lag/lead over the
-    localCheckpoint'd survivor table; oracle: the IDENTICAL stage
-    text as 6 MATERIALIZED stages.  Convergence and correctness are
-    EMITTED: last_round_removed == 0 (round 6 is a fixpoint),
-    fixpoint_resid == 0 (NO surviving sub-threshold local minimum
-    remains — the definition of done, recomputed from the final
-    state), removals_history packs the per-round counts 4/2/2/2/1
-    in base 100, and the plants tell the story: the 5-vertex
-    collinear flat drains over rounds, the area-0-adjacent zigzag
-    simplifies alternately, and the high-salience spike at pos 12
-    survives every round."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q556_documents")
-    s = spark.sql(
-        f"WITH {_q556_fix('q556_documents')} SELECT * FROM s0") \
-        .localCheckpoint()
-    s.createOrReplaceTempView("q556_s0")
-    for r in range(1, 7):
-        s = spark.sql(_q556_stage(f"q556_s{r-1}")) \
-            .localCheckpoint(eager=False)
-        s.createOrReplaceTempView(f"q556_s{r}")
-    return spark.sql("WITH " + _q556_final("q556_s"))
-
-
-def _q557_sql(divop: str, mat: str, tbl: str = "documents") -> str:
-    h = f"(n {divop} 2)"
-    return f"""WITH idx AS (SELECT DISTINCT doc_id % 96 AS i FROM {tbl}),
-       db AS (SELECT doc_id, text,
-                     least(length(text), 96) AS n,
-                     doc_id % 16 AS bkt
-              FROM {tbl}),
-       byt AS{mat} (
-         SELECT d.doc_id, d.bkt, d.n, x.i,
-                CAST(ascii(substr(d.text, x.i + 1, 1)) AS BIGINT)
-                  AS c
-         FROM db d JOIN idx x ON x.i < d.n),
-       parts AS{mat} (
-         SELECT doc_id, bkt, n,
-                (1 + sum(c)) % 65521 AS a_full,
-                (n + sum((n - i) * c)) % 65521 AS b_full,
-                (1 + sum(CASE WHEN i < {h} THEN c ELSE 0 END))
-                  % 65521 AS a1,
-                ({h} + sum(CASE WHEN i < {h} THEN ({h} - i) * c
-                           ELSE 0 END)) % 65521 AS b1,
-                (1 + sum(CASE WHEN i >= {h} THEN c ELSE 0 END))
-                  % 65521 AS a2,
-                ((n - {h}) + sum(CASE WHEN i >= {h} THEN (n - i) * c
-                                 ELSE 0 END)) % 65521 AS b2
-         FROM byt GROUP BY doc_id, bkt, n),
-       comb AS (
-         SELECT doc_id, bkt, n, a_full, b_full,
-                b_full * 65536 + a_full AS adler32,
-                (a1 + a2 - 1 + 65521) % 65521 AS a_c,
-                (b1 + b2 + ((n - {h}) % 65521)
-                 * ((a1 - 1 + 65521) % 65521)) % 65521 AS b_c
-         FROM parts)
-       SELECT CAST(bkt AS BIGINT) AS bkt,
-              CAST(count(*) AS BIGINT) AS n_docs,
-              CAST(sum(n) AS BIGINT) AS bytes_hashed,
-              CAST(sum(adler32) AS BIGINT) AS sum_adler32,
-              CAST(max(adler32) AS BIGINT) AS max_adler32,
-              CAST(sum(a_c - a_full) AS BIGINT) AS combine_resid_a,
-              CAST(sum(b_c - b_full) AS BIGINT) AS combine_resid_b
-       FROM comb GROUP BY bkt"""
-
-
-@query("q557_adler32_combine", _q557_sql("//", " MATERIALIZED"))
-def q557(spark, sf_dir):
-    """Adler-32 rolling checksum over REAL document bytes (zlib /
-    RFC 1950 — the integrity check inside every deflate stream a
-    crawler decompresses; the q37 golden-checksum idea pointed at
-    web payloads): A = 1 + sum(bytes), B = n + sum((n-i)*b_i), both
-    mod 65521, evaluated as ONE closed-form aggregation — the
-    position-weighted sum replaces the sequential byte loop, which
-    is what makes the checksum map-side combinable.  And the
-    DISTRIBUTABILITY is not claimed but PROVEN per document: each
-    doc is split at n/2, each half checksummed independently with
-    the SAME aggregation shape, and zlib's adler32_combine identity
-    A = A1 + A2 - 1, B = B1 + B2 + len2*(A1 - 1) (all mod 65521)
-    reassembles them — combine_resid_a/b == 0 on every bucket
-    certifies that a 100-TB corpus can be checksummed
-    partition-parallel and merged exactly (the identity was
-    validated against zlib.adler32 on 500 random splits at design
-    time, and tests/test_adler_zlib.py pins it against the real
-    zlib on the real testdata).  First min(96, len) chars per doc
-    via a generated position table (the q180 bounded-explode
-    pattern); ascii() CAST to BIGINT before the multiply (the q308
-    overflow lesson).  Output: per doc_id%16 bucket, doc counts,
-    byte counts, checksum sums/maxes, and the two zero residues."""
-    return spark.sql(
-        _q557_sql("div", "",
-                  f"parquet.`{sf_dir}/documents.parquet`"))
-
-
-# --- D-infinity flow direction + NTT convolution (q558-q559) -----------------------------
-
-
-_Q558_Z = ("CASE WHEN x.x BETWEEN 1 AND 4 AND y.x BETWEEN 1 AND 4 "
-           "THEN 500 - 3*x.x - y.x "
-           "WHEN x.x BETWEEN 11 AND 14 AND y.x BETWEEN 11 AND 14 "
-           "THEN 300 "
-           "ELSE 800 - ((x.x - 8)*(x.x - 8) + (y.x - 8)*(y.x - 8)) "
-           "END")
-
-_Q558_FCT = (
-    "SELECT 0 AS f, 1 AS dx1, 0 AS dy1, 1 AS dx2, -1 AS dy2 "
-    "UNION ALL SELECT 1, 0, -1, 1, -1 "
-    "UNION ALL SELECT 2, 0, -1, -1, -1 "
-    "UNION ALL SELECT 3, -1, 0, -1, -1 "
-    "UNION ALL SELECT 4, -1, 0, -1, 1 "
-    "UNION ALL SELECT 5, 0, 1, -1, 1 "
-    "UNION ALL SELECT 6, 0, 1, 1, 1 "
-    "UNION ALL SELECT 7, 1, 0, 1, 1")
-
-
-def _q558_sql(mat: str, tbl: str = "documents") -> str:
-    return f"""WITH xs AS (SELECT DISTINCT doc_id % 16 AS x FROM {tbl}),
-       ras AS{mat} (
-         SELECT x.x AS x, y.x AS y, CAST({_Q558_Z} AS BIGINT) AS z
-         FROM xs x CROSS JOIN xs y),
-       fct AS ({_Q558_FCT}),
-       cand AS{mat} (
-         SELECT c.x, c.y, f.f, c.z - n1.z AS s1, n1.z - n2.z AS s2
-         FROM ras c JOIN fct f ON 1=1
-         JOIN ras n1 ON n1.x = c.x + f.dx1 AND n1.y = c.y + f.dy1
-         JOIN ras n2 ON n2.x = c.x + f.dx2 AND n2.y = c.y + f.dy2
-         WHERE c.x BETWEEN 1 AND 14 AND c.y BETWEEN 1 AND 14),
-       sc AS{mat} (
-         SELECT x, y, f, s1, s2,
-                CASE WHEN s2 < 0 THEN
-                       (CASE WHEN s1 > 0 THEN 2*s1*s1 END)
-                     WHEN s2 <= s1 THEN
-                       (CASE WHEN s1 > 0
-                        THEN 2*(s1*s1 + s2*s2) END)
-                     ELSE (CASE WHEN s1 + s2 > 0
-                           THEN (s1 + s2)*(s1 + s2) END) END AS v,
-                CASE WHEN s2 < 0 THEN 1 WHEN s2 <= s1 THEN 0
-                     ELSE 2 END AS cls
-         FROM cand),
-       win AS{mat} (
-         SELECT x, y, max(v) AS vmax,
-                max(CASE WHEN v IS NOT NULL
-                    THEN v*16 + (15 - f) END) AS wk
-         FROM sc GROUP BY x, y),
-       nm AS (SELECT w.x, w.y, CAST(count(*) AS BIGINT) AS n_at_max
-              FROM win w JOIN sc s ON s.x = w.x AND s.y = w.y
-               AND s.v = w.vmax
-              GROUP BY w.x, w.y),
-       pick AS{mat} (
-         SELECT w.x, w.y,
-                CAST(CASE WHEN w.wk IS NULL THEN 3 ELSE s.cls END
-                     AS BIGINT) AS cls,
-                CAST(CASE WHEN w.wk IS NULL THEN -1
-                     ELSE 15 - (w.wk % 16) END AS BIGINT) AS facet,
-                CAST(coalesce(w.vmax, 0) AS BIGINT) AS v2,
-                CAST(coalesce(s.s1, 0) AS BIGINT) AS s1,
-                CAST(coalesce(s.s2, 0) AS BIGINT) AS s2,
-                CAST(coalesce(n.n_at_max, 0) AS BIGINT) AS n_at_max
-         FROM win w
-         LEFT JOIN sc s ON s.x = w.x AND s.y = w.y
-          AND s.f = 15 - (w.wk % 16)
-         LEFT JOIN nm n ON n.x = w.x AND n.y = w.y),
-       pd AS (SELECT CAST(count(DISTINCT
-                ((cls*16 + facet)*100000 + v2)*400
-                + (s1 + 10)*20 + (s2 + 10)) AS BIGINT)
-                AS plane_distinct
-              FROM pick WHERE x BETWEEN 2 AND 3
-                AND y BETWEEN 2 AND 3),
-       fl AS (SELECT CAST(sum(CASE WHEN cls = 3 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS flat_interior
-              FROM pick WHERE x BETWEEN 12 AND 13
-                AND y BETWEEN 12 AND 13),
-       pf AS (SELECT CAST(count(DISTINCT facet) AS BIGINT)
-                AS parab_facets
-              FROM pick
-              WHERE facet >= 0
-                AND NOT (x BETWEEN 1 AND 4 AND y BETWEEN 1 AND 4)
-                AND NOT (x BETWEEN 11 AND 14
-                         AND y BETWEEN 11 AND 14)),
-       tc AS (SELECT CAST(sum(CASE WHEN n_at_max >= 2 THEN 1
-                              ELSE 0 END) AS BIGINT) AS n_tie_cells
-              FROM pick)
-       SELECT p.cls, p.facet,
-              CAST(count(*) AS BIGINT) AS n_cells,
-              CAST(sum(p.v2) AS BIGINT) AS sum_2slope2,
-              pd.plane_distinct, fl.flat_interior, pf.parab_facets,
-              tc.n_tie_cells
-       FROM pick p CROSS JOIN pd CROSS JOIN fl CROSS JOIN pf
-       CROSS JOIN tc
-       GROUP BY p.cls, p.facet, pd.plane_distinct, fl.flat_interior,
-                pf.parab_facets, tc.n_tie_cells"""
-
-
-@query("q558_dinf_flow", _q558_sql(" MATERIALIZED"))
-def q558(spark, sf_dir):
-    """D-infinity flow direction (Tarboton 1997, WRR — the
-    continuous-angle successor to q466's D8; TauDEM's core
-    routing): per cell the steepest of 8 triangular FACETS, each
-    spanned by a cardinal and a diagonal neighbor, with the flow
-    direction free inside the facet and clamped to its edges
-    otherwise.  The whole operator stays EXACT (the q74 octant
-    dodge aimed at hydrology): within-facet slope comparisons clear
-    the sqrt(2) denominators — 2*s^2 is 2*s1^2 (cardinal-clamped),
-    2*(s1^2 + s2^2) (interior), or (s1+s2)^2 (diagonal-clamped) —
-    so the cross-facet argmax is an integer max with the tie rule
-    packed (v*16 + 15-f: max IS 'steepest, then lowest facet') and
-    the flow DIRECTION is carried as the exact rational pair
-    (s1, s2) — tan(r) = s2/s1 — rather than a transcendental angle.
-    One facet dim (8 rows) x one raster self-join pair = the
-    candidate table; everything else is aggregation.  The fixture
-    makes every branch prove itself in the output: a paraboloid
-    covers ALL 8 facets (parab_facets == 8), a planted plane is
-    perfectly uniform (plane_distinct == 1: every interior plane
-    cell picks facet 7 with (s1,s2) = (3,1)), a flat pool emits
-    class 3 everywhere inside (flat_interior == 4), all three flow
-    classes (interior/cardinal/diagonal) appear as output rows, and
-    n_tie_cells == 60 certifies the tie rule is live.  Reference
-    semantics: the reference's gdaldem family exposes only D8-style
-    derivatives (alg/gdaldem_lib.cpp); D-inf is the standard
-    extension its users reach for."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q558_documents")
-    return spark.sql(_q558_sql("", "q558_documents"))
-
-
-_Q559_PW = [1, 249, 64, 2, 241, 128, 4, 225, 256, 8, 193, 255, 16,
-            129, 253, 32]
-_Q559_IPW = [1, 32, 253, 129, 16, 255, 193, 8, 256, 225, 4, 128,
-             241, 2, 64, 249]
-
-
-def _q559_sql(mat: str, tbl: str = "documents") -> str:
-    pw = " UNION ALL ".join(
-        f"SELECT {m} AS m, {_Q559_PW[m]} AS w, {_Q559_IPW[m]} AS iw"
-        for m in range(16))
-    return f"""WITH js AS (SELECT DISTINCT doc_id % 16 AS j FROM {tbl}),
-       gs AS (SELECT DISTINCT doc_id % 4 AS g FROM {tbl}),
-       pw AS ({pw}),
-       av AS{mat} (
-         SELECT g.g, j.j,
-                (g.g*31 + j.j*j.j*7 + j.j*5) % 257 AS v
-         FROM gs g CROSS JOIN js j),
-       bv AS{mat} (
-         SELECT g.g, j.j,
-                (g.g*31 + j.j*j.j*7 + j.j*5 + 13) % 257 AS v
-         FROM gs g CROSS JOIN js j),
-       direct AS{mat} (
-         SELECT a.g, k.j AS k,
-                CAST(sum(a.v * b.v) % 257 AS BIGINT) AS c
-         FROM av a JOIN js k ON 1=1
-         JOIN bv b ON b.g = a.g AND b.j = (k.j - a.j + 16) % 16
-         GROUP BY a.g, k.j),
-       fa AS{mat} (
-         SELECT a.g, k.j AS k,
-                CAST(sum(a.v * p.w) % 257 AS BIGINT) AS f
-         FROM av a JOIN js k ON 1=1
-         JOIN pw p ON p.m = (a.j * k.j) % 16
-         GROUP BY a.g, k.j),
-       fb AS{mat} (
-         SELECT b.g, k.j AS k,
-                CAST(sum(b.v * p.w) % 257 AS BIGINT) AS f
-         FROM bv b JOIN js k ON 1=1
-         JOIN pw p ON p.m = (b.j * k.j) % 16
-         GROUP BY b.g, k.j),
-       fc AS (SELECT a.g, a.k, (a.f * b.f) % 257 AS f
-              FROM fa a JOIN fb b ON b.g = a.g AND b.k = a.k),
-       ntt AS{mat} (
-         SELECT c.g, j.j,
-                CAST((241 * sum(c.f * p.iw)) % 257 AS BIGINT) AS c2
-         FROM fc c JOIN js j ON 1=1
-         JOIN pw p ON p.m = (c.k * j.j) % 16
-         GROUP BY c.g, j.j),
-       rt AS{mat} (
-         SELECT a.g, j.j,
-                CAST((241 * sum(a.f * p.iw)) % 257 AS BIGINT) AS a2
-         FROM fa a JOIN js j ON 1=1
-         JOIN pw p ON p.m = (a.k * j.j) % 16
-         GROUP BY a.g, j.j),
-       dc AS (SELECT f.g,
-                     CAST(f.f - s.s AS BIGINT) AS dc_resid
-              FROM (SELECT g, f FROM fa WHERE k = 0) f
-              JOIN (SELECT g, sum(v) % 257 AS s FROM av
-                    GROUP BY g) s ON s.g = f.g)
-       SELECT CAST(a.g AS BIGINT) AS g, CAST(a.j AS BIGINT) AS j,
-              CAST(a.v AS BIGINT) AS a_coeff,
-              CAST(b.v AS BIGINT) AS b_coeff,
-              d.c AS conv_direct, n.c2 AS conv_ntt,
-              CAST(n.c2 - d.c AS BIGINT) AS conv_resid,
-              CAST(r.a2 - a.v AS BIGINT) AS roundtrip_resid,
-              dc.dc_resid
-       FROM av a JOIN bv b ON b.g = a.g AND b.j = a.j
-       JOIN direct d ON d.g = a.g AND d.k = a.j
-       JOIN ntt n ON n.g = a.g AND n.j = a.j
-       JOIN rt r ON r.g = a.g AND r.j = a.j
-       JOIN dc ON dc.g = a.g"""
-
-
-@query("q559_ntt_convolution", _q559_sql(" MATERIALIZED"))
-def q559(spark, sf_dir):
-    """Number-theoretic transform + the convolution theorem, all
-    EXACT mod 257 (the Fermat prime — omega = 3^16 = 249 is a
-    primitive 16th root of unity; the machinery under carry-less
-    polynomial hashing, big-integer multiplication, and the
-    Reed-Solomon kin of q468): per group the cyclic convolution of
-    two length-16 integer polynomials computed TWO independent
-    ways — the direct double sum c_k = sum_j a_j * b_{(k-j) mod 16}
-    (one equi-join on the wrapped index, never a nested loop) and
-    the NTT route INTT(NTT(a) .* NTT(b)) where each transform is a
-    relational matrix product against the 16-row broadcast
-    omega-power dim (jk mod 16 indexes just 16 twiddles, inlined as
-    literals computed once at design time) — and the convolution
-    theorem is EMITTED per coefficient: conv_resid == 0 on all 64
-    output rows.  Two more identities ride along: roundtrip_resid
-    == 0 (INTT(NTT(a)) returns a exactly, 241 = 16^-1 mod 257
-    undoing the transform scale) and dc_resid == 0 (the k=0
-    spectral line IS the coefficient sum mod p).  Every sum is
-    bounded by 16*256^2*241 < 2^28 — no overflow anywhere, no
-    floats anywhere."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q559_documents")
-    return spark.sql(_q559_sql("", "q559_documents"))
-
-
-# --- CUSUM change detection + dynamic time warping (q560-q561) ---------------------------
-
-
-def _q560_sql(tbl: str = "documents") -> str:
-    return f"""WITH ts AS (SELECT DISTINCT doc_id % 64 AS t FROM {tbl}),
-       ss AS (SELECT DISTINCT doc_id % 8 AS s FROM {tbl}),
-       xv AS (SELECT s.s, t.t,
-                CAST(((s.s*37 + t.t*t.t*11 + t.t*5 + 13) % 97) % 10
-                     + CASE WHEN s.s IN (2, 5) AND t.t >= 40
-                            THEN 8 ELSE 0 END
-                     + CASE WHEN s.s = 3 AND t.t = 20
-                            THEN 20 ELSE 0 END AS BIGINT) AS x
-              FROM ss s CROSS JOIN ts t),
-       pf AS (SELECT s, t, x, x - 6 AS d,
-                sum(x - 6) OVER (PARTITION BY s ORDER BY t
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS p
-              FROM xv),
-       cu AS (SELECT s, t, x, d, p,
-                p - least(CAST(0 AS BIGINT),
-                      min(p) OVER (PARTITION BY s ORDER BY t
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW)) AS cs
-              FROM pf),
-       rc AS (SELECT s, t, d, cs,
-                lag(cs, 1, CAST(0 AS BIGINT))
-                  OVER (PARTITION BY s ORDER BY t) AS sp
-              FROM cu),
-       agg AS (SELECT s,
-                CAST(count(*) AS BIGINT) AS n_t,
-                CAST(max(cs) AS BIGINT) AS s_max,
-                CAST(max(CASE WHEN cs >= 30 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS alarmed,
-                CAST(coalesce(min(CASE WHEN cs >= 30 THEN t END), -1)
-                     AS BIGINT) AS first_alarm_t,
-                CAST(sum(abs(cs - greatest(CAST(0 AS BIGINT),
-                                           sp + d)))
-                     AS BIGINT) AS rec_resid
-              FROM rc GROUP BY s),
-       ld AS (SELECT doc_id % 8 AS s,
-                     CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl} GROUP BY doc_id % 8)
-       SELECT CAST(a.s AS BIGINT) AS s, a.n_t, a.s_max, a.alarmed,
-              a.first_alarm_t,
-              CAST(CASE WHEN a.s IN (2, 5) THEN 1 ELSE 0 END
-                   AS BIGINT) AS shift_planted,
-              CAST(CASE WHEN a.s IN (2, 5)
-                   THEN a.first_alarm_t - 40 ELSE -1 END
-                   AS BIGINT) AS detect_delay,
-              CAST(CASE WHEN a.alarmed =
-                        CASE WHEN a.s IN (2, 5) THEN 1 ELSE 0 END
-                   THEN 1 ELSE 0 END AS BIGINT) AS detector_correct,
-              a.rec_resid, l.n_docs
-       FROM agg a JOIN ld l ON l.s = a.s"""
-
-
-@query("q560_cusum_drift", _q560_sql())
-def q560(spark, sf_dir):
-    """One-sided CUSUM change detection (Page 1954) over per-host
-    crawl-quality series — the sequential drift detector behind
-    every "did this host's content change?" recrawl trigger
-    (q299/q306 measure rates; CUSUM detects a sustained MEAN SHIFT
-    with bounded detection delay).  The textbook definition is an
-    order-dependent recurrence S_t = max(0, S_{t-1} + x_t - k) —
-    but it has an EXACT relational closed form: with prefix sums
-    P_t of (x_t - k), S_t = P_t - min(0, min_{j<=t} P_j), turning
-    the sequential loop into two window aggregations (the same
-    move that made Adler-32 combinable in q557).  The equivalence
-    is not assumed: rec_resid re-derives the recurrence per row
-    from lag(S) and sums |closed_form - recurrence| — 0 on every
-    series.  The fixture plants all three regimes and the output
-    certifies each: series 2 and 5 carry a +8 mean shift from
-    t = 40 (alarms at t = 43/46, detect_delay 3/6 — the bounded
-    delay that is CUSUM's selling point), series 3 carries a
-    one-step +20 transient BLIP that peaks at s_max = 25, strictly
-    under the h = 30 bar (a single spike is NOT drift — the
-    robustness a naive threshold-on-x detector lacks), and the 5
-    null series stay under 15.  detector_correct == 1 on all 8
-    rows is the zero-false-positive/zero-miss confusion matrix,
-    computed never assumed.  All arithmetic exact BIGINT; n_docs
-    ties each series to its corpus load so output varies with SF."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q560_documents")
-    return spark.sql(_q560_sql("q560_documents"))
-
-
-_Q561_INF = 1000000000
-
-
-def _q561_a(e: str) -> str:
-    return f"(p.pid*5 + ({e})*({e})*3 + ({e})) % 16"
-
-
-def _q561_fix(tbl: str, mat: str, divop: str) -> str:
-    j = "(s.i + 1)"
-    return (
-        f"prs AS (SELECT DISTINCT doc_id % 12 AS pid FROM {tbl}),\n"
-        f"       ps AS (SELECT DISTINCT doc_id % 13 AS i"
-        f" FROM {tbl}),\n"
-        f"       ta AS{mat} (SELECT p.pid, s.i + 1 AS pos,\n"
-        f"           CAST({_q561_a(j)} AS BIGINT) AS tok\n"
-        f"         FROM prs p JOIN ps s ON s.i < 12),\n"
-        f"       tb AS{mat} (SELECT p.pid, s.i + 1 AS pos,\n"
-        f"           CAST(CASE\n"
-        f"             WHEN p.pid = 0 THEN {_q561_a(j)}\n"
-        f"             WHEN p.pid = 1 THEN CASE WHEN s.i + 1 >= 3\n"
-        f"                  THEN {_q561_a('(s.i - 1)')}\n"
-        f"                  ELSE {_q561_a('1')} END\n"
-        f"             WHEN p.pid = 2 THEN {_q561_a(j)} + 5\n"
-        f"             WHEN p.pid = 3 THEN {_q561_a('(12 - s.i)')}\n"
-        f"             WHEN p.pid = 4"
-        f" THEN {_q561_a(f'((s.i + 2) {divop} 2)')}\n"
-        f"             ELSE (p.pid*11 + (s.i+1)*(s.i+1)*7"
-        f" + 2*(s.i+1)) % 16\n"
-        f"           END AS BIGINT) AS tok\n"
-        f"         FROM prs p JOIN ps s ON s.i < 12)")
-
-
-def _q561_stage(d: int, prev: str, prev2: str) -> str:
-    inf = _Q561_INF
-    return (
-        f"SELECT g.pid, g.i, g.j,\n"
-        f"         CASE WHEN g.i = 0 AND g.j = 0"
-        f" THEN CAST(0 AS BIGINT)\n"
-        f"              WHEN g.i = 0 OR g.j = 0"
-        f" THEN CAST({inf} AS BIGINT)\n"
-        f"              ELSE least({inf}, abs(x.tok - y.tok)\n"
-        f"                     + least(u.dtw, l2.dtw, dg.dtw)) END"
-        f" AS dtw,\n"
-        f"         CASE WHEN g.i = 0 AND g.j = 0"
-        f" THEN CAST(0 AS BIGINT)\n"
-        f"              WHEN g.i = 0 OR g.j = 0 OR"
-        f" abs(g.i - g.j) > 3 THEN CAST({inf} AS BIGINT)\n"
-        f"              ELSE least({inf}, abs(x.tok - y.tok)\n"
-        f"                     + least(u.dtwb, l2.dtwb, dg.dtwb)) END"
-        f" AS dtwb\n"
-        f"       FROM (SELECT p.pid, s.i AS i, {d} - s.i AS j\n"
-        f"             FROM prs p JOIN ps s ON s.i <= 12\n"
-        f"             WHERE {d} - s.i BETWEEN 0 AND 12) g\n"
-        f"       LEFT JOIN {prev} u ON u.pid = g.pid\n"
-        f"         AND u.i = g.i - 1 AND u.j = g.j\n"
-        f"       LEFT JOIN {prev} l2 ON l2.pid = g.pid\n"
-        f"         AND l2.i = g.i AND l2.j = g.j - 1\n"
-        f"       LEFT JOIN {prev2} dg ON dg.pid = g.pid\n"
-        f"         AND dg.i = g.i - 1 AND dg.j = g.j - 1\n"
-        f"       LEFT JOIN ta x ON x.pid = g.pid AND x.pos = g.i\n"
-        f"       LEFT JOIN tb y ON y.pid = g.pid AND y.pos = g.j")
-
-
-def _q561_final(last: str, tbl: str) -> str:
-    return (
-        f"lock AS (SELECT x.pid,\n"
-        f"                CAST(sum(abs(x.tok - y.tok)) AS BIGINT)"
-        f" AS lockstep\n"
-        f"         FROM ta x JOIN tb y ON y.pid = x.pid\n"
-        f"           AND y.pos = x.pos GROUP BY x.pid),\n"
-        f"       ld AS (SELECT doc_id % 12 AS pid,\n"
-        f"                     CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"              FROM {tbl} GROUP BY doc_id % 12)\n"
-        f"       SELECT CAST(f.pid AS BIGINT) AS pid,\n"
-        f"              CAST(12 AS BIGINT) AS la,\n"
-        f"              CAST(12 AS BIGINT) AS lb,\n"
-        f"              f.dtw, f.dtwb AS dtw_band, k.lockstep,\n"
-        f"              CAST(CASE WHEN f.dtw <= k.lockstep\n"
-        f"                   THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS dtw_leq_lockstep,\n"
-        f"              CAST(CASE WHEN f.dtwb >= f.dtw\n"
-        f"                   THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS band_geq_full,\n"
-        f"              CAST(f.dtwb - f.dtw AS BIGINT)"
-        f" AS band_penalty,\n"
-        f"              l.n_docs\n"
-        f"       FROM {last} f JOIN lock k ON k.pid = f.pid\n"
-        f"       JOIN ld l ON l.pid = f.pid\n"
-        f"       WHERE f.i = 12 AND f.j = 12")
-
-
-def _q561_oracle(tbl: str = "documents") -> str:
-    parts = [_q561_fix(tbl, " MATERIALIZED", "//"),
-             "w0 AS (SELECT pid, 0 AS i, 0 AS j,"
-             " CAST(0 AS BIGINT) AS dtw, CAST(0 AS BIGINT) AS dtwb"
-             " FROM prs)"]
-    for d in range(1, 25):
-        prev2 = f"w{d-2}" if d >= 2 else "w0"
-        parts.append(f"w{d} AS MATERIALIZED (\n"
-                     f"       {_q561_stage(d, f'w{d-1}', prev2)})")
-    parts.append(_q561_final("w24", tbl))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q561_dtw_alignment", _q561_oracle())
-def q561(spark, sf_dir):
-    """Dynamic time warping (Sakoe-Chiba 1978) — the order-aware
-    ELASTIC alignment distance that completes the trajectory/series
-    metric family (q525's discrete Frechet is its max-min sibling;
-    DTW is the sum-min member that audio alignment, word matching
-    and time-series search actually use).  Per pair of length-12
-    integer series: full DTW, the Sakoe-Chiba band-3 constrained
-    DTW (the O(n*w) variant a 100-TB scan would run), and the
-    lockstep L1 distance — with BOTH containment theorems computed
-    per row, never assumed: dtw_leq_lockstep == 1 (the diagonal is
-    always an admissible warp path) and band_geq_full == 1 (a
-    restricted min cannot beat the unrestricted one).  The plants
-    make every regime live IN THE OUTPUT: pair 0 identical
-    (dtw = 0), pair 1 time-SHIFTED by 2 (dtw 10 vs lockstep 74 —
-    shift invariance, the entire reason DTW exists), pair 2
-    amplitude-offset +5 (warping recovers only part: 43 < 60 —
-    warping cannot fix level), pair 3 reversed (dtw 52 — monotone
-    paths cannot reverse time), pair 4 half-speed time-DILATED
-    (dtw 34 vs lockstep 48), and band_penalty > 0 on pairs 2/4/6
-    proves the band constraint genuinely binds.  ENGINE: the DP is
-    sequential per pair — one applyInPandas over 12 pair groups,
-    exact int64 (the q525/q553 per-entity recurrence template);
-    ORACLE: 24 antidiagonal wavefront MATERIALIZED stages reading
-    only d-1/d-2 (the doubling-trap rule), out-of-band and
-    boundary cells pinned at the 10^9 sentinel with every sum
-    capped under it."""
-    import pandas as pd
-
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q561_documents")
-    fix = _q561_fix("q561_documents", "", "div")
-    toks = spark.sql(
-        f"WITH {fix} "
-        f"SELECT a.pid, a.pos, a.tok, 0 AS side FROM ta a "
-        f"UNION ALL SELECT b.pid, b.pos, b.tok, 1 AS side FROM tb b")
-    nd = spark.sql(
-        "SELECT doc_id % 12 AS pid, CAST(count(*) AS BIGINT)"
-        " AS n_docs FROM q561_documents GROUP BY doc_id % 12")
-    inf = _Q561_INF
-
-    def dp(key, g: pd.DataFrame) -> pd.DataFrame:
-        a = g[g.side == 0].sort_values("pos").tok.tolist()
-        b = g[g.side == 1].sort_values("pos").tok.tolist()
-        m, n = len(a), len(b)
-
-        def run(band):
-            D = [[inf] * (n + 1) for _ in range(m + 1)]
-            D[0][0] = 0
-            for i in range(1, m + 1):
-                for j in range(1, n + 1):
-                    if band is not None and abs(i - j) > band:
-                        continue
-                    c = abs(a[i - 1] - b[j - 1])
-                    D[i][j] = min(inf, c + min(D[i - 1][j],
-                                               D[i][j - 1],
-                                               D[i - 1][j - 1]))
-            return D[m][n]
-
-        full, banded = run(None), run(3)
-        lock = sum(abs(a[i] - b[i]) for i in range(m))
-        return pd.DataFrame(
-            {"pid": [int(key[0])], "la": [m], "lb": [n],
-             "dtw": [full], "dtw_band": [banded],
-             "lockstep": [lock],
-             "dtw_leq_lockstep": [1 if full <= lock else 0],
-             "band_geq_full": [1 if banded >= full else 0],
-             "band_penalty": [banded - full]})
-
-    res = toks.groupBy("pid").applyInPandas(
-        dp, "pid long, la long, lb long, dtw long, dtw_band long, "
-            "lockstep long, dtw_leq_lockstep long, "
-            "band_geq_full long, band_penalty long")
-    return res.join(nd, "pid")
-
-
-# --- Depression filling + mergeable heavy hitters (q562-q563) -----------------------------
-
-
-def _q562_base(tbl: str, divop: str, mat: str) -> str:
-    gx, gy = "(cid % 12)", f"(cid {divop} 12)"
-    return (
-        f"cells AS (SELECT DISTINCT doc_id % 120 AS cid"
-        f" FROM {tbl}),\n"
-        f"       grid AS{mat} (SELECT {gx} AS gx, {gy} AS gy,\n"
-        f"         CAST(CASE\n"
-        f"           WHEN {gx} BETWEEN 2 AND 4 AND {gy} BETWEEN 2"
-        f" AND 4\n"
-        f"                THEN 5 + ({gx} + {gy}) % 2\n"
-        f"           WHEN {gx} = 9 AND {gy} = 7 THEN 3\n"
-        f"           WHEN {gy} = 7 AND {gx} BETWEEN 1 AND 4\n"
-        f"                THEN 9 - {gx}\n"
-        f"           ELSE 20 + {gx} + {gy}\n"
-        f"                + ({gx}*7 + {gy}*11 + {gx}*{gy}) % 3\n"
-        f"         END AS BIGINT) AS dem\n"
-        f"         FROM cells),\n"
-        f"       d0 AS{mat} (SELECT gx, gy, dem,\n"
-        f"         CAST(CASE WHEN gx IN (0, 11) OR gy IN (0, 9)\n"
-        f"              THEN dem ELSE 99999999 END AS BIGINT) AS w\n"
-        f"         FROM grid)")
-
-
-def _q562_relax(prev: str) -> str:
-    return (
-        f"SELECT p.gx, p.gy, p.dem,\n"
-        f"         CASE WHEN p.gx IN (0, 11) OR p.gy IN (0, 9)\n"
-        f"              THEN p.dem\n"
-        f"              ELSE greatest(p.dem, min(n.w)) END AS w\n"
-        f"       FROM {prev} p\n"
-        f"       JOIN {prev} n\n"
-        f"         ON greatest(abs(n.gx - p.gx),"
-        f" abs(n.gy - p.gy)) = 1\n"
-        f"       GROUP BY p.gx, p.gy, p.dem")
-
-
-def _q562_post(dF: str, dP: str, tbl: str, mat: str) -> str:
-    return (
-        f"conv AS{mat} (SELECT CAST(sum(abs(a.w - b.w)) AS BIGINT)"
-        f" AS conv_resid\n"
-        f"         FROM {dF} a JOIN {dP} b\n"
-        f"           ON b.gx = a.gx AND b.gy = a.gy),\n"
-        f"       fx AS{mat} (SELECT p.gx, p.gy, p.w,\n"
-        f"           CASE WHEN p.gx IN (0, 11) OR p.gy IN (0, 9)\n"
-        f"                THEN p.dem\n"
-        f"                ELSE greatest(p.dem, min(n.w)) END"
-        f" AS tgt\n"
-        f"         FROM {dF} p JOIN {dF} n\n"
-        f"           ON greatest(abs(n.gx - p.gx),"
-        f" abs(n.gy - p.gy)) = 1\n"
-        f"         GROUP BY p.gx, p.gy, p.dem, p.w),\n"
-        f"       fixr AS{mat} (SELECT CAST(sum(abs(w - tgt))"
-        f" AS BIGINT) AS fix_resid FROM fx),\n"
-        f"       lab AS{mat} (SELECT gx, gy, dem, w,\n"
-        f"           CASE WHEN gx BETWEEN 2 AND 4 AND gy BETWEEN 2"
-        f" AND 4 THEN 1\n"
-        f"                WHEN gx = 9 AND gy = 7 THEN 2\n"
-        f"                WHEN gy = 7 AND gx BETWEEN 1 AND 4 THEN 3\n"
-        f"                ELSE 0 END AS dep\n"
-        f"         FROM {dF}),\n"
-        f"       deps AS{mat} (SELECT dep,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_cells,\n"
-        f"           CAST(max(w) AS BIGINT) AS fill_level,\n"
-        f"           CAST(count(DISTINCT w) AS BIGINT) AS n_levels,\n"
-        f"           CAST(sum(w - dem) AS BIGINT) AS volume\n"
-        f"         FROM lab WHERE dep > 0 GROUP BY dep),\n"
-        f"       pour AS{mat} (SELECT l.dep,\n"
-        f"           CAST(min(o.w) AS BIGINT) AS pour_w\n"
-        f"         FROM lab l JOIN lab o\n"
-        f"           ON greatest(abs(o.gx - l.gx),"
-        f" abs(o.gy - l.gy)) = 1\n"
-        f"          AND o.dep = 0\n"
-        f"         WHERE l.dep > 0 GROUP BY l.dep),\n"
-        f"       gtot AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN w > dem THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_raised,\n"
-        f"           CAST(sum(CASE WHEN w > dem AND dep = 0"
-        f" THEN 1 ELSE 0 END) AS BIGINT) AS n_raised_outside,\n"
-        f"           CAST(sum(CASE WHEN w < dem THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_below_dem\n"
-        f"         FROM lab),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(l.gx AS BIGINT) AS gx,\n"
-        f"              CAST(l.gy AS BIGINT) AS gy,\n"
-        f"              l.dem, l.w AS filled,\n"
-        f"              CAST(l.w - l.dem AS BIGINT) AS depth,\n"
-        f"              CAST(l.dep AS BIGINT) AS dep,\n"
-        f"              d.n_cells, d.fill_level, d.n_levels,"
-        f" d.volume,\n"
-        f"              p.pour_w,\n"
-        f"              CAST(d.fill_level - p.pour_w AS BIGINT)"
-        f" AS pour_resid,\n"
-        f"              c.conv_resid, f.fix_resid,\n"
-        f"              g.n_raised, g.n_raised_outside,"
-        f" g.n_below_dem, ld.n_docs\n"
-        f"       FROM lab l\n"
-        f"       JOIN deps d ON d.dep = l.dep\n"
-        f"       JOIN pour p ON p.dep = l.dep\n"
-        f"       CROSS JOIN conv c CROSS JOIN fixr f\n"
-        f"       CROSS JOIN gtot g CROSS JOIN ld\n"
-        f"       WHERE l.dep > 0")
-
-
-_Q562_ROUNDS = 6
-
-
-def _q562_oracle(tbl: str = "documents") -> str:
-    parts = [_q562_base(tbl, "//", " MATERIALIZED")]
-    for r in range(1, _Q562_ROUNDS + 1):
-        parts.append(f"d{r} AS MATERIALIZED (\n"
-                     f"       {_q562_relax(f'd{r - 1}')})")
-    parts.append(_q562_post(f"d{_Q562_ROUNDS}",
-                            f"d{_Q562_ROUNDS - 1}", tbl,
-                            " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q562_fill_depressions", _q562_oracle())
-def q562(spark, sf_dir):
-    """Depression filling (Planchon & Darboux 2002; GRASS r.fill.dir,
-    the `fill sinks` step every D8/D-inf hydrology run needs first —
-    q466/q519/q558 route flow on a RAW surface; real DEMs have pits
-    that trap all routing until filled).  Spec re-pinned
-    round-synchronous per the sieve lesson: W0 = dem on the border,
-    +inf interior; each Jacobi round W(c) = max(dem(c), min over the
-    8 in-grid neighbors of W) with the border pinned at dem (water
-    escapes off-grid) — the fixpoint is the filled surface W(c) =
-    max(dem(c), min over border paths of the path's max elevation),
-    i.e. every pit rises exactly to its pour point.  Engine: a real
-    DataFrame loop, one relax stage per round, localCheckpoint per
-    round because each stage references its predecessor NINE times
-    (self + 8 neighbors — the doubling-chain rule: count REFERENCES,
-    not stages); oracle unrolls the IDENTICAL stage text as 6
-    MATERIALIZED CTEs.  The 12x10 fixture plants all three depression
-    shapes on a bumpy drained plane (dem = 20 + gx + gy + hash%3,
-    whose diagonal chain to the border guarantees the NULL terrain
-    never rises — the inspect-the-null-side lesson, emitted as
-    n_raised_outside == 0): a 3x3 basin (dep 1, fills flat to its
-    ring min 23), a 1-cell pothole (dep 2, fills to 35), and a 4-cell
-    descending trench (dep 3, whose far end is 4 cells from the pour
-    point — the shape that forces multiple propagation rounds; fills
-    to 26).  Convergence is EMITTED, never assumed: round 5 is the
-    fixpoint (design-time measured), conv_resid == 0 proves round 6
-    changed nothing, and fix_resid == 0 re-derives the update from
-    the FINAL state (no cell is improvable).  Each depression's
-    answer self-certifies: n_levels == 1 (the filled surface is
-    FLAT), pour_resid == 0 (fill_level equals the min final-W over
-    the depression's outside 8-neighbors, derived independently of
-    the iteration), n_raised == 14 == the planted cell count, and
-    n_below_dem == 0 (filling never digs).  volume = sum(W - dem)
-    per depression is the impoundment capacity.  All arithmetic
-    exact BIGINT; n_docs ties output to corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q562_documents")
-    base = _q562_base("q562_documents", "div", "")
-    for tv in ("grid", "d0"):
-        df = spark.sql(f"WITH {base} SELECT * FROM {tv}") \
-            .localCheckpoint()
-        df.createOrReplaceTempView(f"q562_{tv}")
-    prev = "q562_d0"
-    for r in range(1, _Q562_ROUNDS + 1):
-        d = spark.sql(_q562_relax(prev)).localCheckpoint(eager=False)
-        d.createOrReplaceTempView(f"q562_d{r}")
-        prev = f"q562_d{r}"
-    post = _q562_post(f"q562_d{_Q562_ROUNDS}",
-                      f"q562_d{_Q562_ROUNDS - 1}",
-                      "q562_documents", "")
-    return spark.sql("WITH " + post)
-
-
-def _q563_sql(tbl: str, mat: str = "") -> str:
-    def summ(src: str, pref: str, part: str) -> str:
-        pc, pg = ("r.p, ", "PARTITION BY p ") if part else ("", "")
-        jn = ("JOIN" if part else "CROSS JOIN")
-        on = (" ON h.p = r.p" if part else "")
-        gb = ("GROUP BY p" if part else "")
-        return (
-            f"{pref}rk AS{mat} (SELECT {'p, ' if part else ''}tok,"
-            f" c,\n"
-            f"           row_number() OVER ({pg}ORDER BY c DESC,"
-            f" tok) AS rn\n"
-            f"         FROM {src}),\n"
-            f"       {pref}th AS{mat} (SELECT"
-            f" {'p, ' if part else ''}coalesce(max(CASE WHEN rn = 9"
-            f" THEN c END), CAST(0 AS BIGINT)) AS t\n"
-            f"         FROM {pref}rk {gb}),\n"
-            f"       {pref}sm AS{mat} (SELECT {pc}r.tok,"
-            f" r.c - h.t AS e\n"
-            f"         FROM {pref}rk r {jn} {pref}th h{on}\n"
-            f"         WHERE r.c - h.t > 0)")
-
-    return f"""WITH s AS (SELECT doc_id,
-                CASE WHEN doc_id % 5 = 0 THEN 7
-                     WHEN doc_id % 7 = 0 THEN 13
-                     WHEN doc_id % 11 = 0 THEN 30 + doc_id % 4
-                     ELSE (doc_id*doc_id*3 + doc_id*11) % 50
-                END AS tok,
-                doc_id % 4 AS p
-              FROM {tbl}),
-       pc AS{mat} (SELECT p, tok, CAST(count(*) AS BIGINT) AS c
-              FROM s GROUP BY p, tok),
-       {summ("pc", "p", "p")},
-       c01 AS{mat} (SELECT tok, CAST(sum(e) AS BIGINT) AS c
-              FROM psm WHERE p IN (0, 1) GROUP BY tok),
-       {summ("c01", "a", "")},
-       c23 AS{mat} (SELECT tok, CAST(sum(e) AS BIGINT) AS c
-              FROM psm WHERE p IN (2, 3) GROUP BY tok),
-       {summ("c23", "b", "")},
-       cmf AS{mat} (SELECT tok, CAST(sum(e) AS BIGINT) AS c
-              FROM (SELECT tok, e FROM asm UNION ALL
-                    SELECT tok, e FROM bsm) u GROUP BY tok),
-       {summ("cmf", "m", "")},
-       fc AS{mat} (SELECT tok, CAST(count(*) AS BIGINT) AS c
-              FROM s GROUP BY tok),
-       {summ("fc", "g", "")},
-       toks AS (SELECT tok FROM msm UNION SELECT tok FROM gsm),
-       gl AS{mat} (SELECT
-              CAST((SELECT count(*) FROM s) AS BIGINT) AS n_total,
-              CAST((SELECT sum(e) FROM msm) AS BIGINT) AS s_merged,
-              CAST((SELECT sum(e) FROM gsm) AS BIGINT) AS s_single,
-              CAST((SELECT count(*) FROM msm) AS BIGINT)
-                AS k_merged,
-              CAST((SELECT count(*) FROM gsm) AS BIGINT)
-                AS k_single,
-              CAST((SELECT sum(t) FROM pth) AS BIGINT) AS t_parts,
-              CAST((SELECT t FROM ath) AS BIGINT) AS t_m01,
-              CAST((SELECT t FROM bth) AS BIGINT) AS t_m23,
-              CAST((SELECT t FROM mth) AS BIGINT) AS t_final,
-              CAST((SELECT t FROM gth) AS BIGINT) AS t_single)
-       SELECT CAST(t.tok AS BIGINT) AS tok,
-              f.c AS f_true,
-              CAST(coalesce(m.e, 0) AS BIGINT) AS est_merged,
-              CAST(coalesce(g2.e, 0) AS BIGINT) AS est_single,
-              CAST(f.c - coalesce(m.e, 0) AS BIGINT)
-                AS under_merged,
-              CAST(f.c - coalesce(g2.e, 0) AS BIGINT)
-                AS under_single,
-              CAST(CASE WHEN coalesce(m.e, 0) <= f.c
-                    AND coalesce(g2.e, 0) <= f.c
-                   THEN 1 ELSE 0 END AS BIGINT) AS one_sided_ok,
-              CAST(CASE WHEN (f.c - coalesce(m.e, 0)) * 9
-                         <= gl.n_total - gl.s_merged
-                   THEN 1 ELSE 0 END AS BIGINT) AS bound_ok_merged,
-              CAST(CASE WHEN (f.c - coalesce(g2.e, 0)) * 9
-                         <= gl.n_total - gl.s_single
-                   THEN 1 ELSE 0 END AS BIGINT) AS bound_ok_single,
-              CAST(CASE WHEN f.c * 9 > gl.n_total - gl.s_merged
-                   THEN 1 ELSE 0 END AS BIGINT) AS is_heavy,
-              CAST(CASE WHEN m.e IS NOT NULL
-                   THEN 1 ELSE 0 END AS BIGINT) AS in_merged,
-              CAST(CASE WHEN g2.e IS NOT NULL
-                   THEN 1 ELSE 0 END AS BIGINT) AS in_single,
-              gl.n_total, gl.s_merged, gl.s_single,
-              gl.k_merged, gl.k_single,
-              gl.t_parts, gl.t_m01, gl.t_m23, gl.t_final,
-              gl.t_single
-       FROM toks t
-       JOIN fc f ON f.tok = t.tok
-       LEFT JOIN msm m ON m.tok = t.tok
-       LEFT JOIN gsm g2 ON g2.tok = t.tok
-       CROSS JOIN gl"""
-
-
-@query("q563_misra_gries_merge", _q563_sql("documents",
-                                           " MATERIALIZED"))
-def q563(spark, sf_dir):
-    """Mergeable Misra-Gries heavy hitters (Misra & Gries 1982;
-    Agarwal/Cormode/Huang/Phillips/Wei/Yi SIGMOD 2012) — THE
-    bounded-memory frequent-items summary behind every "top hosts /
-    top tokens on the stream" dashboard.  The textbook algorithm is
-    a sequential k-counter decrement loop, but its BATCH form is
-    order-free and fully relational: summarize(counts) = subtract
-    the (k+1)-th largest count T from every count and keep the
-    positives (at most k survive — anything strictly above the
-    (k+1)-th largest is at most k items; each subtraction of T
-    destroys >= (k+1)*T total mass because >= k+1 items held >= T).
-    That mass argument is the whole error theory, and this query
-    COMPUTES it rather than citing it: the corpus (one token per
-    document, k = 8) is summarized two independent ways — single
-    pass over the full counts, and the DISTRIBUTED way: 4 partition
-    summaries (p = doc_id % 4) merged pairwise then finally, the
-    Agarwal et al. merge rule (add estimates, re-subtract the
-    (k+1)-th largest) at every internal node.  Emitted per token
-    (the union of both summaries): one_sided_ok == 1 (estimates
-    NEVER overcount — the guarantee sketches like CountMin invert),
-    bound_ok_merged/single == 1 ((f - est)*(k+1) <= n - S, the
-    mergeability theorem, exact integer arithmetic, S = surviving
-    summary mass), and is_heavy ==> in_merged AND in_single (no
-    heavy hitter is ever evicted: every token with f*(k+1) > n - S
-    appears in BOTH summaries — the completeness half users rely
-    on).  Every threshold level genuinely fires in the fixture
-    (partition T = 6-7, both internal merges T >= 1, final merge
-    T >= 1, single-pass T = 24 at sf0.001 — per-partition local
-    heavies 30+p break the symmetry that would dead-code the merge
-    subtraction; the %11 selector varies within %4 classes per the
-    gcd lesson), k_merged/k_single <= 8 certify the memory bound,
-    and the planted global heavies 7 (every 5th doc) and 13 (every
-    7th) survive all three merge levels.  Scale story: partition
-    summaries are map-side-combinable k-row objects — the shuffle
-    carries 4*k rows regardless of corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q563_documents")
-    return spark.sql(_q563_sql("q563_documents"))
-
-
-# --- CRC32 linear checksum + ear-clipping triangulation (q564-q565) -----------------------
-
-
-def _crc32_tables():
-    """zlib CRC-32 basis tables, derived from the public polynomial
-    0xEDB88320 (RFC 1952 / reference gcore checksum kin).  The
-    byte-step c' = (c >> 8) ^ T[(c ^ b) & 0xFF] is LINEAR over
-    GF(2) in (c, b) because the table map T is linear in its index;
-    everything the relational plan needs is the images of basis
-    vectors: T[2^k] (8 words) and A^(2^j) e_b for the
-    advance-one-zero-byte map A (6 x 32 words, j = 0..5 covering
-    shifts up to 63 bytes)."""
-    poly = 0xEDB88320
-
-    def tstep(idx: int) -> int:
-        c = idx
-        for _ in range(8):
-            c = (c >> 1) ^ (poly if c & 1 else 0)
-        return c
-
-    def z1(c: int) -> int:
-        return (c >> 8) ^ tstep(c & 0xFF)
-
-    t1 = [tstep(1 << k) for k in range(8)]
-    aj = {}
-    for j in range(6):
-        for b in range(32):
-            w = 1 << b
-            for _ in range(1 << j):
-                w = z1(w)
-            aj[(j, b)] = w
-    return t1, aj
-
-
-_Q564_T1, _Q564_AJ = _crc32_tables()
-
-
-def _q564_dims() -> str:
-    bdim = ", ".join(f"({b}, {1 << b})" for b in range(32))
-    kdim = ", ".join(f"({k}, {1 << k})" for k in range(8))
-    t1d = ", ".join(f"({k}, {w})" for k, w in enumerate(_Q564_T1))
-    ajd = ", ".join(f"({j}, {b}, {_Q564_AJ[(j, b)]})"
-                    for j in range(6) for b in range(32))
-    return (
-        f"bdim AS (SELECT * FROM (VALUES {bdim}) t(b, pw)),\n"
-        f"       kdim AS (SELECT * FROM (VALUES {kdim})"
-        f" t(k, kpw)),\n"
-        f"       t1d AS (SELECT * FROM (VALUES {t1d}) t(k, w)),\n"
-        f"       ajd AS (SELECT * FROM (VALUES {ajd}) t(j, b, w))")
-
-
-def _q564_p0(tbl: str, divop: str) -> str:
-    return (
-        f"ddim AS (SELECT DISTINCT doc_id % 64 AS d FROM {tbl}),\n"
-        f"       p0 AS (SELECT dd.d, bb.b, CAST(bb.pw AS BIGINT)"
-        f" AS w\n"
-        f"         FROM ddim dd CROSS JOIN bdim bb)")
-
-
-def _q564_stage(j: int, prev: str, divop: str) -> str:
-    pj = 1 << j
-    return (
-        f"SELECT p.d, p.b,\n"
-        f"         CASE WHEN (p.d {divop} {pj}) % 2 = 1\n"
-        f"              THEN coalesce(x.w, CAST(0 AS BIGINT))\n"
-        f"              ELSE p.w END AS w\n"
-        f"       FROM {prev} p\n"
-        f"       LEFT JOIN (SELECT p2.d, p2.b, bit_xor(a.w) AS w\n"
-        f"         FROM {prev} p2\n"
-        f"         JOIN bdim t ON (p2.w {divop} t.pw) % 2 = 1\n"
-        f"         JOIN ajd a ON a.j = {j} AND a.b = t.b\n"
-        f"         WHERE (p2.d {divop} {pj}) % 2 = 1\n"
-        f"         GROUP BY p2.d, p2.b) x\n"
-        f"         ON x.d = p.d AND x.b = p.b")
-
-
-def _q564_post(p6: str, tbl: str, divop: str, mat: str,
-               xop) -> str:
-    h = f"e.n {divop} 2"
-    crc = xop("4294967295", xop("z.w", "c.f0_full"))
-    resid = xop(xop("coalesce(h.w, CAST(0 AS BIGINT))", "c.f0_h2"),
-                "c.f0_full")
-    return (
-        f"tp AS{mat} (SELECT dd.d, t.k, bit_xor(p.w) AS w\n"
-        f"         FROM ddim dd CROSS JOIN t1d t\n"
-        f"         JOIN bdim bb ON (t.w {divop} bb.pw) % 2 = 1\n"
-        f"         JOIN {p6} p ON p.d = dd.d AND p.b = bb.b\n"
-        f"         GROUP BY dd.d, t.k),\n"
-        f"       zi AS{mat} (SELECT d, bit_xor(w) AS w FROM {p6}"
-        f" GROUP BY d),\n"
-        f"       idx AS (SELECT DISTINCT doc_id % 48 AS i"
-        f" FROM {tbl}),\n"
-        f"       db AS (SELECT doc_id, text,\n"
-        f"                least(length(text), 48) AS n,\n"
-        f"                doc_id % 16 AS bkt FROM {tbl}),\n"
-        f"       byt AS{mat} (SELECT d.doc_id, d.bkt, d.n, x.i,\n"
-        f"           CAST(ascii(substr(d.text, x.i + 1, 1))"
-        f" AS BIGINT) AS c\n"
-        f"         FROM db d JOIN idx x ON x.i < d.n),\n"
-        f"       ex AS{mat} (SELECT y.doc_id, y.bkt, y.n, y.i,"
-        f" k.k\n"
-        f"         FROM byt y JOIN kdim k\n"
-        f"           ON (y.c {divop} k.kpw) % 2 = 1),\n"
-        f"       con AS{mat} (SELECT e.doc_id, e.bkt, e.n,\n"
-        f"           bit_xor(tf.w) AS f0_full,\n"
-        f"           coalesce(bit_xor(CASE WHEN e.i < {h}"
-        f" THEN th.w END), CAST(0 AS BIGINT)) AS f0_h1,\n"
-        f"           coalesce(bit_xor(CASE WHEN e.i >= {h}"
-        f" THEN tf.w END), CAST(0 AS BIGINT)) AS f0_h2\n"
-        f"         FROM ex e\n"
-        f"         JOIN tp tf ON tf.d = e.n - 1 - e.i"
-        f" AND tf.k = e.k\n"
-        f"         LEFT JOIN tp th ON th.d = {h} - 1 - e.i"
-        f" AND th.k = e.k\n"
-        f"         GROUP BY e.doc_id, e.bkt, e.n),\n"
-        f"       zh AS{mat} (SELECT c.doc_id, bit_xor(p.w) AS w\n"
-        f"         FROM con c\n"
-        f"         JOIN bdim b2 ON (c.f0_h1 {divop} b2.pw) % 2"
-        f" = 1\n"
-        f"         JOIN {p6} p ON p.d = c.n - c.n {divop} 2"
-        f" AND p.b = b2.b\n"
-        f"         GROUP BY c.doc_id),\n"
-        f"       fin AS{mat} (SELECT c.doc_id, c.bkt, c.n,\n"
-        f"           {crc} AS crc32,\n"
-        f"           {resid} AS comb_resid\n"
-        f"         FROM con c JOIN zi z ON z.d = c.n\n"
-        f"         LEFT JOIN zh h ON h.doc_id = c.doc_id)\n"
-        f"       SELECT CAST(bkt AS BIGINT) AS bkt,\n"
-        f"              CAST(count(*) AS BIGINT) AS n_docs,\n"
-        f"              CAST(sum(n) AS BIGINT) AS bytes_hashed,\n"
-        f"              CAST(sum(crc32) AS BIGINT) AS sum_crc32,\n"
-        f"              CAST(max(crc32) AS BIGINT) AS max_crc32,\n"
-        f"              CAST(count(DISTINCT crc32) AS BIGINT)"
-        f" AS n_distinct_crc,\n"
-        f"              CAST(sum(comb_resid) AS BIGINT)"
-        f" AS combine_resid\n"
-        f"       FROM fin GROUP BY bkt")
-
-
-def _q564_oracle(tbl: str = "documents") -> str:
-    def xop(a: str, b: str) -> str:
-        return f"xor({a}, {b})"
-
-    parts = [_q564_dims(), _q564_p0(tbl, "//")]
-    for j in range(6):
-        parts.append(f"p{j + 1} AS MATERIALIZED (\n"
-                     f"       {_q564_stage(j, f'p{j}', '//')})")
-    parts.append(_q564_post("p6", tbl, "//", " MATERIALIZED", xop))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q564_crc32_linear", _q564_oracle())
-def q564(spark, sf_dir):
-    """CRC-32 (zlib / RFC 1952, polynomial 0xEDB88320) over real
-    document bytes — the sequel to q557's Adler-32: the OTHER
-    checksum in every gzip member a crawler decompresses, and the
-    harder one to distribute because its state is a 32-bit GF(2)
-    register, not two modular sums.  The sequential byte loop
-    c' = (c >> 8) ^ T[(c ^ b) & 0xFF] is linear over GF(2) (the
-    table map is linear in its index), so the register after n
-    bytes is an XOR of independent per-byte terms: crc = 0xFFFFFFFF
-    ^ Z^n(0xFFFFFFFF) ^ XOR_i Z^(n-1-i)(T[b_i]) with Z = advance
-    one zero byte — and XOR terms are what bit_xor aggregations
-    eat.  The variable matrix power Z^d is built RELATIONALLY by
-    pointer doubling: 6 stages, each applying the design-inlined
-    basis images of Z^(2^j) (192 literal words) to the rows whose
-    d has bit j set — explode the 32 bits, join the basis dim,
-    bit_xor back together; the (d, b) table then turns each
-    byte's contribution into ONE lookup (T[b] itself folds to an
-    8-row basis dim because T is linear).  Distribution is PROVEN
-    per document, not claimed: each doc splits at n/2, both halves
-    reduce with the SAME aggregation shape, and the crc32_combine
-    identity F(m1||m2) = Z^(len2)(F(m1)) ^ F(m2) reassembles them
-    — combine_resid == 0 on every bucket is the exact statement
-    that a 100-TB corpus can be CRC'd partition-parallel.  The
-    linear formula and the identity were validated against the
-    real zlib.crc32 on random messages at design time and
-    tests/test_crc_zlib.py pins the SQL's per-bucket sums against
-    zlib on the real testdata bytes.  First min(48, len) chars per
-    doc; all arithmetic exact BIGINT (words < 2^32); engine
-    materializes each doubling stage via localCheckpoint (2
-    references per stage — the doubling-chain rule), oracle runs
-    the IDENTICAL stage text as MATERIALIZED CTEs; scalar XOR is
-    the one engine-split token (DuckDB xor(a,b) vs Spark ^ — the
-    q554 power-operator lesson)."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q564_documents")
-    for dim in ("bdim", "kdim", "t1d", "ajd"):
-        spark.sql("WITH " + _q564_dims() + f" SELECT * FROM {dim}") \
-            .createOrReplaceTempView(f"q564_{dim}")
-    p0 = spark.sql(
-        "WITH " + _q564_p0("q564_documents", "div")
-        .replace("CROSS JOIN bdim", "CROSS JOIN q564_bdim")
-        + " SELECT * FROM p0").localCheckpoint()
-    p0.createOrReplaceTempView("q564_p0")
-    ddim = spark.sql(
-        "SELECT DISTINCT doc_id % 64 AS d FROM q564_documents") \
-        .localCheckpoint()
-    ddim.createOrReplaceTempView("q564_ddim")
-    prev = "q564_p0"
-    for j in range(6):
-        stage = _q564_stage(j, prev, "div") \
-            .replace("JOIN bdim t", "JOIN q564_bdim t") \
-            .replace("JOIN ajd a", "JOIN q564_ajd a")
-        d = spark.sql(stage).localCheckpoint(eager=False)
-        d.createOrReplaceTempView(f"q564_p{j + 1}")
-        prev = f"q564_p{j + 1}"
-
-    def xop(a: str, b: str) -> str:
-        return f"({a} ^ {b})"
-
-    post = _q564_post("q564_p6", "q564_documents", "div", "", xop) \
-        .replace("FROM ddim dd", "FROM q564_ddim dd") \
-        .replace("CROSS JOIN t1d t", "CROSS JOIN q564_t1d t") \
-        .replace("JOIN bdim bb", "JOIN q564_bdim bb") \
-        .replace("JOIN kdim k", "JOIN q564_kdim k") \
-        .replace("JOIN bdim b2", "JOIN q564_bdim b2")
-    return spark.sql("WITH " + post)
-
-
-_Q565_POLY = [(0, 0), (2, 3), (9, 3), (12, 0), (16, 2), (14, 7),
-              (16, 12), (9, 10), (7, 14), (3, 12), (5, 7), (1, 6)]
-
-
-def _q565_s0(tbl: str) -> str:
-    xs = " ".join(f"WHEN {i} THEN {x}"
-                  for i, (x, _) in enumerate(_Q565_POLY))
-    ys = " ".join(f"WHEN {i} THEN {y}"
-                  for i, (_, y) in enumerate(_Q565_POLY))
-    return (
-        f"SELECT i AS pos,\n"
-        f"         CAST(CASE i {xs} END AS BIGINT) AS x,\n"
-        f"         CAST(CASE i {ys} END AS BIGINT) AS y\n"
-        f"       FROM (SELECT DISTINCT doc_id % 12 AS i"
-        f" FROM {tbl}) t")
-
-
-def _q565_ek(prev: str) -> str:
-    return (
-        f"SELECT r.pos, r.x, r.y, r.ppos, r.npos,\n"
-        f"         p.x AS px, p.y AS py, q.x AS qx, q.y AS qy,\n"
-        f"         (r.x - p.x)*(q.y - p.y)"
-        f" - (r.y - p.y)*(q.x - p.x) AS cr,\n"
-        f"         sum(CASE WHEN o.pos IS NOT NULL THEN 1 ELSE 0"
-        f" END) AS n_in,\n"
-        f"         CASE WHEN (r.x - p.x)*(q.y - p.y)\n"
-        f"                   - (r.y - p.y)*(q.x - p.x) > 0\n"
-        f"               AND sum(CASE WHEN o.pos IS NOT NULL"
-        f" THEN 1 ELSE 0 END) = 0\n"
-        f"              THEN 1 ELSE 0 END AS is_ear,\n"
-        f"         ((r.x - p.x)*(q.y - p.y)\n"
-        f"          - (r.y - p.y)*(q.x - p.x))*64 + r.pos AS k\n"
-        f"       FROM (SELECT a.pos, a.x, a.y,\n"
-        f"               coalesce(max(CASE WHEN b.pos < a.pos"
-        f" THEN b.pos END), max(b.pos)) AS ppos,\n"
-        f"               coalesce(min(CASE WHEN b.pos > a.pos"
-        f" THEN b.pos END), min(b.pos)) AS npos\n"
-        f"             FROM {prev} a JOIN {prev} b"
-        f" ON b.pos <> a.pos\n"
-        f"             GROUP BY a.pos, a.x, a.y) r\n"
-        f"       JOIN {prev} p ON p.pos = r.ppos\n"
-        f"       JOIN {prev} q ON q.pos = r.npos\n"
-        f"       LEFT JOIN {prev} o\n"
-        f"         ON o.pos <> r.pos AND o.pos <> r.ppos"
-        f" AND o.pos <> r.npos\n"
-        f"        AND (r.x - p.x)*(o.y - p.y)"
-        f" - (r.y - p.y)*(o.x - p.x) >= 0\n"
-        f"        AND (q.x - r.x)*(o.y - r.y)"
-        f" - (q.y - r.y)*(o.x - r.x) >= 0\n"
-        f"        AND (p.x - q.x)*(o.y - q.y)"
-        f" - (p.y - q.y)*(o.x - q.x) >= 0\n"
-        f"       GROUP BY r.pos, r.x, r.y, r.ppos, r.npos,"
-        f" p.x, p.y, q.x, q.y")
-
-
-def _q565_rem(ek: str) -> str:
-    return (
-        f"SELECT e.pos, e.ppos, e.npos, e.cr\n"
-        f"       FROM {ek} e\n"
-        f"       JOIN {ek} p2 ON p2.pos = e.ppos\n"
-        f"       JOIN {ek} n2 ON n2.pos = e.npos\n"
-        f"       WHERE e.is_ear = 1\n"
-        f"         AND NOT (p2.is_ear = 1 AND p2.k < e.k)\n"
-        f"         AND NOT (n2.is_ear = 1 AND n2.k < e.k)")
-
-
-def _q565_next(prev: str, rem: str) -> str:
-    return (
-        f"SELECT pos, x, y FROM {prev}\n"
-        f"       WHERE pos NOT IN (SELECT pos FROM {rem})")
-
-
-def _q565_final(sF: str, ek1: str, rems: list, tbl: str,
-                mat: str) -> str:
-    un = "\n         UNION ALL ".join(
-        f"SELECT {r} AS rnd, pos, ppos, npos, cr FROM {rem}"
-        for r, rem in enumerate(rems, start=1))
-    return (
-        f"fin AS{mat} (SELECT 5 AS rnd, e.pos, e.ppos, e.npos,"
-        f" e.cr\n"
-        f"         FROM ({_q565_ek(sF)}) e\n"
-        f"         WHERE e.pos = (SELECT min(pos) FROM {sF})),\n"
-        f"       tris AS{mat} ({un}\n"
-        f"         UNION ALL SELECT rnd, pos, ppos, npos, cr"
-        f" FROM fin),\n"
-        f"       sh AS{mat} (SELECT CAST(sum(x*qy - qx*y)"
-        f" AS BIGINT) AS a2 FROM {ek1}),\n"
-        f"       st AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN cr <= 0 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_reflex_r1,\n"
-        f"           CAST(sum(CASE WHEN cr > 0 AND n_in > 0"
-        f" THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked_r1\n"
-        f"         FROM {ek1}),\n"
-        f"       tot AS{mat} (SELECT\n"
-        f"           CAST(count(*) AS BIGINT) AS n_tris,\n"
-        f"           CAST(sum(cr) AS BIGINT) AS area2_total,\n"
-        f"           CAST(min(cr) AS BIGINT) AS min_cr,\n"
-        f"           CAST(sum(CASE rnd WHEN 1 THEN 100000000\n"
-        f"                WHEN 2 THEN 1000000 WHEN 3 THEN 10000\n"
-        f"                WHEN 4 THEN 100 ELSE 1 END) AS BIGINT)"
-        f" AS rounds_packed\n"
-        f"         FROM tris),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(t.rnd AS BIGINT) AS rnd,\n"
-        f"              CAST(t.pos AS BIGINT) AS apex,\n"
-        f"              CAST(t.ppos AS BIGINT) AS prev_pos,\n"
-        f"              CAST(t.npos AS BIGINT) AS next_pos,\n"
-        f"              CAST(t.cr AS BIGINT) AS area2,\n"
-        f"              o.n_tris, o.area2_total, o.min_cr,\n"
-        f"              CAST(o.area2_total - s.a2 AS BIGINT)"
-        f" AS area_resid,\n"
-        f"              o.rounds_packed, st.n_reflex_r1,"
-        f" st.n_blocked_r1, ld.n_docs\n"
-        f"       FROM tris t CROSS JOIN tot o CROSS JOIN sh s\n"
-        f"       CROSS JOIN st CROSS JOIN ld")
-
-
-_Q565_ROUNDS = 4
-
-
-def _q565_oracle(tbl: str = "documents") -> str:
-    parts = [f"s0 AS MATERIALIZED ({_q565_s0(tbl)})"]
-    rems = []
-    prev = "s0"
-    for r in range(1, _Q565_ROUNDS + 1):
-        parts.append(f"ek{r} AS MATERIALIZED (\n"
-                     f"       {_q565_ek(prev)})")
-        parts.append(f"rem{r} AS MATERIALIZED (\n"
-                     f"       {_q565_rem(f'ek{r}')})")
-        parts.append(f"s{r} AS MATERIALIZED (\n"
-                     f"       {_q565_next(prev, f'rem{r}')})")
-        rems.append(f"rem{r}")
-        prev = f"s{r}"
-    parts.append(_q565_final(prev, "ek1", rems, tbl,
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q565_ear_clipping", _q565_oracle())
-def q565(spark, sf_dir):
-    """Ear-clipping polygon triangulation (Meister's two-ears
-    theorem; the triangulator behind every polygon fill/tessellate
-    step — the reference rasterizes polygons by scanline, but its
-    OGR surface hands triangulation to downstream renderers and
-    q482's MVT tiles need exactly this).  The textbook algorithm
-    clips one ear at a time off a heap — sequential.  Re-pinned
-    round-synchronous per the sieve/VW lesson: a vertex is an EAR
-    iff its corner is convex (exact integer cross product > 0) AND
-    no other surviving vertex lies inside-or-on its triangle (three
-    >= 0 half-plane tests — boundary contact BLOCKS, so degenerate
-    clips are impossible by construction); a round removes every
-    ear whose packed key cr*64 + pos is smaller than both ADJACENT
-    ears' keys (non-ear neighbors don't block — that guarantees the
-    global-min ear always clips, so progress is certain; keys are
-    distinct so two adjacent ears can never clip in one round —
-    the simultaneous-removal trap killed by construction, not
-    care).  Engine: a real DataFrame loop, ear table + removal +
-    survivor state localCheckpoint'd per round (the ear stage
-    references its state FIVE times); oracle unrolls the IDENTICAL
-    stage text as MATERIALIZED CTEs.  The 12-vertex concave
-    fixture exercises every branch and the output certifies each:
-    n_reflex_r1 == 5 (reflex corners are never ears),
-    n_blocked_r1 == 1 (a CONVEX corner vetoed only by the
-    containment test — the branch naive implementations skip),
-    rounds_packed == 402020101 (4/2/2/1 clips then the final
-    triangle), and the fundamental theorem rides every row:
-    n_tris == 10 == n-2 exactly, min_cr > 0 (every emitted
-    triangle positively oriented), and area_resid == 0 — the sum
-    of the 10 triangle cross products equals the polygon's
-    shoelace area computed INDEPENDENTLY from the untouched
-    round-1 ring (exact integers, the conservation law that makes
-    a triangulation a partition rather than a soup).  n_docs ties
-    output to corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q565_documents")
-    s0 = spark.sql(_q565_s0("q565_documents")).localCheckpoint()
-    s0.createOrReplaceTempView("q565_s0")
-    prev = "q565_s0"
-    rems = []
-    for r in range(1, _Q565_ROUNDS + 1):
-        ek = spark.sql(_q565_ek(prev)).localCheckpoint(eager=False)
-        ek.createOrReplaceTempView(f"q565_ek{r}")
-        rem = spark.sql(_q565_rem(f"q565_ek{r}")) \
-            .localCheckpoint(eager=False)
-        rem.createOrReplaceTempView(f"q565_rem{r}")
-        s = spark.sql(_q565_next(prev, f"q565_rem{r}")) \
-            .localCheckpoint(eager=False)
-        s.createOrReplaceTempView(f"q565_s{r}")
-        rems.append(f"q565_rem{r}")
-        prev = f"q565_s{r}"
-    return spark.sql("WITH " + _q565_final(
-        prev, "q565_ek1", rems, "q565_documents", ""))
-
-
-# --- Conflict serializability + exact PageRank (q566-q567) --------------------------------
-
-
-_Q566_OPS = [
-    # hid 0: serializable — chain T0->T1->T2->T3->T4 plus T0->T2
-    # shortcut and an independent pair T5->T6 (parallel peel)
-    (0, 0, 0, 0, 10), (0, 1, 0, 1, 10), (0, 2, 1, 0, 10),
-    (0, 3, 1, 1, 11), (0, 4, 2, 0, 11), (0, 5, 2, 1, 12),
-    (0, 6, 3, 0, 12), (0, 7, 3, 1, 13), (0, 8, 4, 0, 13),
-    (0, 9, 4, 1, 14), (0, 10, 0, 0, 15), (0, 11, 2, 1, 15),
-    (0, 12, 5, 1, 16), (0, 13, 6, 0, 16),
-    # hid 1: cycle T0->T1->T2->T0, plus T3->T0 (T3 peels, cycle
-    # sticks)
-    (1, 0, 0, 1, 20), (1, 1, 1, 0, 20), (1, 2, 1, 1, 21),
-    (1, 3, 2, 0, 21), (1, 4, 2, 1, 22), (1, 5, 0, 0, 22),
-    (1, 6, 3, 0, 23), (1, 7, 3, 1, 23), (1, 8, 0, 1, 23),
-]
-
-
-def _q566_base(tbl: str, mat: str) -> str:
-    h = " ".join(f"WHEN {i} THEN {r[0]}" for i, r in enumerate(_Q566_OPS))
-    s = " ".join(f"WHEN {i} THEN {r[1]}" for i, r in enumerate(_Q566_OPS))
-    t = " ".join(f"WHEN {i} THEN {r[2]}" for i, r in enumerate(_Q566_OPS))
-    w = " ".join(f"WHEN {i} THEN {r[3]}" for i, r in enumerate(_Q566_OPS))
-    it = " ".join(f"WHEN {i} THEN {r[4]}" for i, r in enumerate(_Q566_OPS))
-    return (
-        f"ops AS (SELECT CAST(CASE i {h} END AS BIGINT) AS hid,\n"
-        f"           CAST(CASE i {s} END AS BIGINT) AS step,\n"
-        f"           CAST(CASE i {t} END AS BIGINT) AS txn,\n"
-        f"           CAST(CASE i {w} END AS BIGINT) AS wr,\n"
-        f"           CAST(CASE i {it} END AS BIGINT) AS item\n"
-        f"         FROM (SELECT DISTINCT doc_id % 23 AS i"
-        f" FROM {tbl}) t),\n"
-        f"       eg AS{mat} (SELECT DISTINCT a.hid, a.txn AS u,"
-        f" b.txn AS v\n"
-        f"         FROM ops a JOIN ops b\n"
-        f"           ON b.hid = a.hid AND b.item = a.item\n"
-        f"          AND b.step > a.step AND b.txn <> a.txn\n"
-        f"          AND (a.wr = 1 OR b.wr = 1)),\n"
-        f"       rem0 AS{mat} (SELECT DISTINCT hid, txn FROM ops)")
-
-
-def _q566_zero(prev: str) -> str:
-    return (
-        f"SELECT r.hid, r.txn FROM {prev} r\n"
-        f"       WHERE NOT EXISTS (SELECT 1 FROM eg e\n"
-        f"         JOIN {prev} u ON u.hid = e.hid AND u.txn = e.u\n"
-        f"         WHERE e.hid = r.hid AND e.v = r.txn)")
-
-
-def _q566_rem(prev: str, zero: str) -> str:
-    return (
-        f"SELECT r.hid, r.txn FROM {prev} r\n"
-        f"       WHERE NOT EXISTS (SELECT 1 FROM {zero} z\n"
-        f"         WHERE z.hid = r.hid AND z.txn = r.txn)")
-
-
-_Q566_ROUNDS = 5
-
-
-def _q566_final(remF: str, zeros: list, tbl: str, mat: str) -> str:
-    un = "\n         UNION ALL ".join(
-        f"SELECT hid, txn, {r} AS lvl FROM {z}"
-        for r, z in enumerate(zeros, start=1))
-    return (
-        f"lv AS{mat} ({un}),\n"
-        f"       allt AS (SELECT DISTINCT hid, txn FROM ops),\n"
-        f"       asg AS{mat} (SELECT a.hid, a.txn,\n"
-        f"           CAST(coalesce(l.lvl, -1) AS BIGINT) AS lvl\n"
-        f"         FROM allt a LEFT JOIN lv l\n"
-        f"           ON l.hid = a.hid AND l.txn = a.txn),\n"
-        f"       viol AS{mat} (SELECT e.hid,\n"
-        f"           CAST(sum(CASE WHEN a.lvl >= 1 AND b.lvl >= 1\n"
-        f"                 AND a.lvl >= b.lvl THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_lvl_violations\n"
-        f"         FROM eg e\n"
-        f"         JOIN asg a ON a.hid = e.hid AND a.txn = e.u\n"
-        f"         JOIN asg b ON b.hid = e.hid AND b.txn = e.v\n"
-        f"         GROUP BY e.hid),\n"
-        f"       scert AS{mat} (SELECT s.hid,\n"
-        f"           CAST(min(s.indeg) AS BIGINT)"
-        f" AS min_stuck_indeg\n"
-        f"         FROM (SELECT r.hid, r.txn,\n"
-        f"                 (SELECT count(*) FROM eg e\n"
-        f"                  JOIN {remF} u ON u.hid = e.hid"
-        f" AND u.txn = e.u\n"
-        f"                  WHERE e.hid = r.hid AND e.v = r.txn)"
-        f" AS indeg\n"
-        f"               FROM {remF} r) s GROUP BY s.hid),\n"
-        f"       hh AS{mat} (SELECT a.hid,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_txns,\n"
-        f"           CAST(sum(CASE WHEN a.lvl = -1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_stuck,\n"
-        f"           CAST(CASE WHEN sum(CASE WHEN a.lvl = -1"
-        f" THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS is_serializable\n"
-        f"         FROM asg a GROUP BY a.hid),\n"
-        f"       ne AS (SELECT hid, CAST(count(*) AS BIGINT)"
-        f" AS n_edges FROM eg GROUP BY hid),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT a.hid, a.txn, a.lvl,\n"
-        f"              h.n_txns, h.n_stuck, h.is_serializable,\n"
-        f"              n.n_edges, v.n_lvl_violations,\n"
-        f"              CAST(coalesce(c.min_stuck_indeg, -1)"
-        f" AS BIGINT) AS min_stuck_indeg,\n"
-        f"              ld.n_docs\n"
-        f"       FROM asg a\n"
-        f"       JOIN hh h ON h.hid = a.hid\n"
-        f"       JOIN ne n ON n.hid = a.hid\n"
-        f"       JOIN viol v ON v.hid = a.hid\n"
-        f"       LEFT JOIN scert c ON c.hid = a.hid\n"
-        f"       CROSS JOIN ld")
-
-
-def _q566_oracle(tbl: str = "documents") -> str:
-    parts = [_q566_base(tbl, " MATERIALIZED")]
-    zeros = []
-    prev = "rem0"
-    for r in range(1, _Q566_ROUNDS + 1):
-        parts.append(f"z{r} AS MATERIALIZED (\n"
-                     f"       {_q566_zero(prev)})")
-        parts.append(f"rem{r} AS MATERIALIZED (\n"
-                     f"       {_q566_rem(prev, f'z{r}')})")
-        zeros.append(f"z{r}")
-        prev = f"rem{r}"
-    parts.append(_q566_final(prev, zeros, tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q566_conflict_serializability", _q566_oracle())
-def q566(spark, sf_dir):
-    """Conflict-serializability of transaction histories (the
-    precedence-graph test, Eswaran et al. 1976 / every database
-    textbook; the q531 MVCC visibility kin — a crawl/ingest
-    pipeline's concurrent writers need exactly this audit over
-    their operation logs).  Conflicts (same item, different txns,
-    at least one write, ordered by step) induce the precedence
-    graph; the history is serializable iff that graph is ACYCLIC,
-    and Kahn's topological sort — peel zero-in-degree nodes — is
-    naturally round-synchronous: each round removes EVERY currently
-    source-free txn simultaneously (no key packing needed; peeling
-    is conflict-free by definition).  Engine: a real DataFrame loop
-    over the remaining-set with localCheckpoint per round (each
-    round references its state twice); oracle unrolls the IDENTICAL
-    stage text as MATERIALIZED CTEs.  The fixture runs TWO
-    histories through the same plan and the verdict is COMPUTED,
-    never assumed: hid 0 (7 txns: a conflict chain, a shortcut
-    edge, and an independent pair that peels in parallel at round
-    1) fully levels — is_serializable == 1 with the certificate
-    n_lvl_violations == 0 re-checking EVERY precedence edge against
-    the emitted levels (u strictly before v); hid 1 plants the
-    3-cycle T0->T1->T2->T0 plus a peelable T3 — is_serializable ==
-    0 with the STUCK certificate min_stuck_indeg >= 1 (every
-    unpeeled txn still has a predecessor among the unpeeled: the
-    witness that the residue is genuinely cyclic, not a peel
-    shortfall), and T3's lvl == 1 proves the peel ran on the cyclic
-    history too.  Levels are the serial execution order a scheduler
-    could replay.  All exact BIGINT; n_docs ties output to corpus
-    size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q566_documents")
-    base = _q566_base("q566_documents", "")
-    for tv in ("ops", "eg", "rem0"):
-        df = spark.sql(f"WITH {base} SELECT * FROM {tv}") \
-            .localCheckpoint()
-        df.createOrReplaceTempView(f"q566_{tv}")
-    prev = "q566_rem0"
-    zeros = []
-    for r in range(1, _Q566_ROUNDS + 1):
-        z = spark.sql(_q566_zero(prev).replace("FROM eg e",
-                                               "FROM q566_eg e")) \
-            .localCheckpoint(eager=False)
-        z.createOrReplaceTempView(f"q566_z{r}")
-        rem = spark.sql(_q566_rem(prev, f"q566_z{r}")) \
-            .localCheckpoint(eager=False)
-        rem.createOrReplaceTempView(f"q566_rem{r}")
-        zeros.append(f"q566_z{r}")
-        prev = f"q566_rem{r}"
-    fin = _q566_final(prev, zeros, "q566_documents", "") \
-        .replace("FROM eg e", "FROM q566_eg e") \
-        .replace("FROM ops", "FROM q566_ops") \
-        .replace("FROM eg GROUP", "FROM q566_eg GROUP")
-    return spark.sql("WITH " + fin)
-
-
-_Q567_EDGES = sorted(
-    {(v, (v + 1) % 12) for v in range(12)}
-    | {(v, 0) for v in (2, 3, 5, 7, 8, 10)}
-    | {(0, 4), (0, 6), (1, 5), (4, 8), (6, 9), (9, 3), (11, 4)})
-
-_Q567_ROUNDS = 8
-_Q567_MASS = 12 * 24 ** _Q567_ROUNDS  # n * M^rounds, M = 4L = 24
-
-
-def _q567_base(tbl: str, divop: str, mat: str) -> str:
-    u = " ".join(f"WHEN {i} THEN {e[0]}"
-                 for i, e in enumerate(_Q567_EDGES))
-    v = " ".join(f"WHEN {i} THEN {e[1]}"
-                 for i, e in enumerate(_Q567_EDGES))
-    return (
-        f"eg AS (SELECT CAST(CASE i {u} END AS BIGINT) AS u,\n"
-        f"           CAST(CASE i {v} END AS BIGINT) AS v\n"
-        f"         FROM (SELECT DISTINCT doc_id % 25 AS i"
-        f" FROM {tbl}) t),\n"
-        f"       wt AS{mat} (SELECT u, CAST(count(*) AS BIGINT)"
-        f" AS dg,\n"
-        f"           CAST(6 {divop} count(*) AS BIGINT) AS w,\n"
-        f"           CAST(CASE WHEN 6 % count(*) <> 0 THEN 1"
-        f" ELSE 0 END AS BIGINT) AS bad\n"
-        f"         FROM eg GROUP BY u),\n"
-        f"       ew AS{mat} (SELECT e.u, e.v, w.w\n"
-        f"         FROM eg e JOIN wt w ON w.u = e.u),\n"
-        f"       nodes AS (SELECT DISTINCT u AS v FROM eg),\n"
-        f"       r0 AS{mat} (SELECT v, CAST(1 AS BIGINT) AS val"
-        f" FROM nodes)")
-
-
-def _q567_round(prev: str, divop: str) -> str:
-    return (
-        f"SELECT n.v,\n"
-        f"         (6 * t.tm) {divop} 12 + 3 * m.m AS val\n"
-        f"       FROM nodes n\n"
-        f"       CROSS JOIN (SELECT sum(val) AS tm FROM {prev}) t\n"
-        f"       JOIN (SELECT e.v, sum(p.val * e.w) AS m\n"
-        f"             FROM ew e JOIN {prev} p ON p.v = e.u\n"
-        f"             GROUP BY e.v) m ON m.v = n.v")
-
-
-def _q567_final(rF: str, rP: str, rQ: str, tbl: str,
-                mat: str) -> str:
-    return (
-        f"gap8 AS{mat} (SELECT CAST(sum(abs(a.val - 24 * b.val))"
-        f" AS BIGINT) AS g\n"
-        f"         FROM {rF} a JOIN {rP} b ON b.v = a.v),\n"
-        f"       gap7 AS{mat} (SELECT CAST(sum(abs(a.val"
-        f" - 24 * b.val)) AS BIGINT) AS g\n"
-        f"         FROM {rP} a JOIN {rQ} b ON b.v = a.v),\n"
-        f"       ms AS{mat} (SELECT CAST(sum(val)"
-        f" - {_Q567_MASS} AS BIGINT) AS mass_resid FROM {rF}),\n"
-        f"       bd AS (SELECT CAST(sum(bad) AS BIGINT)"
-        f" AS n_bad_deg,\n"
-        f"              CAST(sum(dg) AS BIGINT) AS n_edges"
-        f" FROM wt),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT r.v, r.val AS rank_scaled,\n"
-        f"              CAST(row_number() OVER (ORDER BY r.val"
-        f" DESC, r.v) AS BIGINT) AS rnk,\n"
-        f"              g8.g AS gap8, g7.g AS gap7,\n"
-        f"              CAST(CASE WHEN 4 * g8.g <= 72 * g7.g\n"
-        f"                   THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS contraction_ok,\n"
-        f"              m.mass_resid, b.n_edges, b.n_bad_deg,\n"
-        f"              ld.n_docs\n"
-        f"       FROM {rF} r\n"
-        f"       CROSS JOIN gap8 g8 CROSS JOIN gap7 g7\n"
-        f"       CROSS JOIN ms m CROSS JOIN bd b CROSS JOIN ld")
-
-
-def _q567_oracle(tbl: str = "documents") -> str:
-    parts = [_q567_base(tbl, "//", " MATERIALIZED")]
-    for r in range(1, _Q567_ROUNDS + 1):
-        parts.append(f"r{r} AS MATERIALIZED (\n"
-                     f"       {_q567_round(f'r{r - 1}', '//')})")
-    parts.append(_q567_final(f"r{_Q567_ROUNDS}",
-                             f"r{_Q567_ROUNDS - 1}",
-                             f"r{_Q567_ROUNDS - 2}", tbl,
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q567_pagerank_exact", _q567_oracle())
-def q567(spark, sf_dir):
-    """PageRank power iteration in EXACT integer arithmetic (Brin &
-    Page 1998 — THE web-graph operator; the reference's GNM stack
-    q33/q47/q64 does reachability and shortest paths, and q440's
-    absorption chains are the Markov kin, but link-analysis ranking
-    is the op a crawl corpus actually gets scored with).  Floats
-    are the standard poison here (per-engine summation order breaks
-    bitwise parity); instead the damping 3/4 is DYADIC and every
-    division is cleared at design time: with L = lcm(out-degrees)
-    = 6 and per-round scale M = 4L = 24, the update R'(v) =
-    6*T/12 + 3 * sum_u R(u)*(6/deg(u)) is division-free (6/deg
-    exact because deg | 6 — emitted as n_bad_deg == 0, computed
-    from the RELATIONAL degree count, not the design table), and
-    after 8 rounds every value is an exact 38-bit integer.  The
-    two power-iteration theorems ride the output, computed never
-    cited: mass CONSERVATION — sum(R_8) - 12*24^8 == 0 exactly
-    (teleport + damped flow redistribute, never leak; the resid
-    is against a design-time literal), and CONTRACTION — gap_t =
-    sum_v |R_t - 24*R_{t-1}| is the scaled iteration delta, and
-    4*gap_8 <= 3*24*gap_7 certifies the L1 error shrinks by at
-    least the damping factor per round (the geometric-convergence
-    guarantee, as an exact integer inequality).  The 25-edge
-    12-node fixture plants a hub (6 extra in-links): it lands
-    rnk == 1, and the full ranking is a total order (12 distinct
-    exact values).  Engine: DataFrame loop, one round per stage,
-    localCheckpoint per round (each round references its
-    predecessor twice: total mass + in-flow); oracle the IDENTICAL
-    stage text as 8 MATERIALIZED CTEs.  Scale story: each round is
-    one edge-join + one aggregation — the shape GraphX/Pregel runs
-    at billions of edges; nothing here is per-node sequential."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q567_documents")
-    base = _q567_base("q567_documents", "div", "")
-    for tv in ("eg", "wt", "ew", "nodes", "r0"):
-        df = spark.sql(f"WITH {base} SELECT * FROM {tv}") \
-            .localCheckpoint()
-        df.createOrReplaceTempView(f"q567_{tv}")
-    prev = "q567_r0"
-    for r in range(1, _Q567_ROUNDS + 1):
-        d = spark.sql(
-            _q567_round(prev, "div")
-            .replace("FROM nodes n", "FROM q567_nodes n")
-            .replace("FROM ew e", "FROM q567_ew e")) \
-            .localCheckpoint(eager=False)
-        d.createOrReplaceTempView(f"q567_r{r}")
-        prev = f"q567_r{r}"
-    fin = _q567_final(f"q567_r{_Q567_ROUNDS}",
-                      f"q567_r{_Q567_ROUNDS - 1}",
-                      f"q567_r{_Q567_ROUNDS - 2}",
-                      "q567_documents", "") \
-        .replace("FROM wt", "FROM q567_wt")
-    return spark.sql("WITH " + fin)
-
-
-# --- Vector clocks + count-min sketch (q568-q569) -----------------------------------------
-
-
-_Q568_MSGS = [(1, 10), (12, 17), (19, 5), (6, 22), (14, 7),
-              (16, 8)]
-
-
-def _q568_base(tbl: str, divop: str, mat: str) -> str:
-    ma = " ".join(f"WHEN {j} THEN {a}"
-                  for j, (a, _) in enumerate(_Q568_MSGS))
-    mb = " ".join(f"WHEN {j} THEN {b}"
-                  for j, (_, b) in enumerate(_Q568_MSGS))
-    return (
-        f"ev AS (SELECT i AS e, i {divop} 8 AS r, i % 8 AS ix\n"
-        f"         FROM (SELECT DISTINCT doc_id % 24 AS i"
-        f" FROM {tbl}) t),\n"
-        f"       me AS (SELECT CAST(CASE j {ma} END AS BIGINT)"
-        f" AS a,\n"
-        f"           CAST(CASE j {mb} END AS BIGINT) AS b\n"
-        f"         FROM (SELECT DISTINCT doc_id % 6 AS j"
-        f" FROM {tbl}) t),\n"
-        f"       eg AS{mat} (SELECT e AS a, e + 1 AS b FROM ev"
-        f" WHERE ix < 7\n"
-        f"         UNION SELECT a, b FROM me),\n"
-        f"       c0 AS{mat} (SELECT e AS a, e AS b FROM ev\n"
-        f"         UNION SELECT a, b FROM eg)")
-
-
-def _q568_double(prev: str) -> str:
-    return (
-        f"SELECT DISTINCT a, b FROM (\n"
-        f"         SELECT a, b FROM {prev}\n"
-        f"         UNION ALL\n"
-        f"         SELECT x.a, y.b FROM {prev} x\n"
-        f"         JOIN {prev} y ON y.a = x.b) t")
-
-
-_Q568_STAGES = 5
-
-
-def _q568_final(cF: str, cP: str, tbl: str, mat: str) -> str:
-    return (
-        f"axes AS (SELECT DISTINCT r AS ax FROM ev),\n"
-        f"       vc AS{mat} (SELECT e.e, x.ax,\n"
-        f"           CAST(coalesce(v.v, 0) AS BIGINT) AS v\n"
-        f"         FROM ev e CROSS JOIN axes x\n"
-        f"         LEFT JOIN (SELECT c.b AS e, s.r AS ax,"
-        f" count(*) AS v\n"
-        f"           FROM {cF} c JOIN ev s ON s.e = c.a\n"
-        f"           GROUP BY c.b, s.r) v\n"
-        f"           ON v.e = e.e AND v.ax = x.ax),\n"
-        f"       pr AS (SELECT a.e AS a, b.e AS b FROM ev a\n"
-        f"         JOIN ev b ON b.e <> a.e),\n"
-        f"       cmp AS{mat} (SELECT p.a, p.b,\n"
-        f"           min(CASE WHEN va.v <= vb.v THEN 1 ELSE 0 END)"
-        f" AS le,\n"
-        f"           max(CASE WHEN va.v < vb.v THEN 1 ELSE 0 END)"
-        f" AS lt\n"
-        f"         FROM pr p\n"
-        f"         JOIN vc va ON va.e = p.a\n"
-        f"         JOIN vc vb ON vb.e = p.b AND vb.ax = va.ax\n"
-        f"         GROUP BY p.a, p.b),\n"
-        f"       iff AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN\n"
-        f"             CASE WHEN h.a IS NOT NULL THEN 1 ELSE 0 END\n"
-        f"             <> CASE WHEN c.le = 1 AND c.lt = 1 THEN 1"
-        f" ELSE 0 END\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT) AS iff_viol,\n"
-        f"           CAST(sum(CASE WHEN h.a IS NOT NULL THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS n_hb,\n"
-        f"           CAST(sum(CASE WHEN p.a < p.b"
-        f" AND h.a IS NULL AND h2.a IS NULL THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_conc\n"
-        f"         FROM pr p\n"
-        f"         JOIN cmp c ON c.a = p.a AND c.b = p.b\n"
-        f"         LEFT JOIN {cF} h ON h.a = p.a AND h.b = p.b\n"
-        f"         LEFT JOIN {cF} h2 ON h2.a = p.b"
-        f" AND h2.b = p.a),\n"
-        f"       cv AS{mat} (SELECT\n"
-        f"           CAST((SELECT count(*) FROM {cF})\n"
-        f"             - (SELECT count(*) FROM {cP}) AS BIGINT)"
-        f" AS closure_resid),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(e.e AS BIGINT) AS e,\n"
-        f"              CAST(e.r AS BIGINT) AS replica,\n"
-        f"              CAST(e.ix AS BIGINT) AS ix,\n"
-        f"              max(CASE WHEN v.ax = 0 THEN v.v END)"
-        f" AS vc0,\n"
-        f"              max(CASE WHEN v.ax = 1 THEN v.v END)"
-        f" AS vc1,\n"
-        f"              max(CASE WHEN v.ax = 2 THEN v.v END)"
-        f" AS vc2,\n"
-        f"              max(i.iff_viol) AS iff_viol,\n"
-        f"              max(i.n_hb) AS n_hb,\n"
-        f"              max(i.n_conc) AS n_conc,\n"
-        f"              max(c.closure_resid) AS closure_resid,\n"
-        f"              max(ld.n_docs) AS n_docs\n"
-        f"       FROM ev e\n"
-        f"       JOIN vc v ON v.e = e.e\n"
-        f"       CROSS JOIN iff i CROSS JOIN cv c CROSS JOIN ld\n"
-        f"       GROUP BY e.e, e.r, e.ix")
-
-
-def _q568_oracle(tbl: str = "documents") -> str:
-    parts = [_q568_base(tbl, "//", " MATERIALIZED")]
-    for k in range(1, _Q568_STAGES + 1):
-        parts.append(f"c{k} AS MATERIALIZED (\n"
-                     f"       {_q568_double(f'c{k - 1}')})")
-    parts.append(_q568_final(f"c{_Q568_STAGES}",
-                             f"c{_Q568_STAGES - 1}", tbl,
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q568_vector_clocks", _q568_oracle())
-def q568(spark, sf_dir):
-    """Vector clocks and the causal-order characterization theorem
-    (Fidge/Mattern 1988 — the machinery under every CRDT,
-    causal-consistent store, and distributed-trace analyzer; the
-    q531 MVCC and q566 serializability kin for REPLICATED systems).
-    The fixture is a 3-replica, 24-event execution: program-order
-    edges plus 6 message edges (including a cross-replica relay
-    chain and deliberately unsynchronized segments).  Three
-    independent computations meet in the output: (1) the
-    happens-before relation as the TRANSITIVE CLOSURE of the event
-    DAG, built by pointer doubling — 5 stages of R := R union R∘R
-    (paths up to 24 hops need 4; the 5th stage proves the fixpoint,
-    emitted as closure_resid == 0); (2) each event's vector clock
-    DERIVED FROM the closure by counting — VC(e)[ax] = #{events on
-    replica ax that reach e} (reflexive), the counting definition
-    rather than the message-passing recurrence; (3) the
-    CHARACTERIZATION THEOREM a -> b <=> VC(a) < VC(b)
-    (componentwise <=, somewhere <) verified EXHAUSTIVELY over all
-    552 ordered pairs — iff_viol == 0 is Mattern's theorem as a
-    computed integer, both directions at once (no false causality,
-    no missed causality).  n_hb == 192 and n_conc == 84 emit the
-    causal structure's size; the 84 concurrent pairs are exactly
-    what a race detector would flag.  Engine: DataFrame doubling
-    loop with localCheckpoint per stage (each stage references its
-    predecessor three times); oracle the IDENTICAL stage text as
-    MATERIALIZED CTEs.  Scale story: doubling closure is O(log
-    diameter) joins — the watershed/q555 machinery pointed at
-    causality."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q568_documents")
-    base = _q568_base("q568_documents", "div", "")
-    for tv in ("ev", "me", "eg", "c0"):
-        df = spark.sql(f"WITH {base} SELECT * FROM {tv}") \
-            .localCheckpoint()
-        df.createOrReplaceTempView(f"q568_{tv}")
-    prev = "q568_c0"
-    for k in range(1, _Q568_STAGES + 1):
-        d = spark.sql(_q568_double(prev)).localCheckpoint(
-            eager=False)
-        d.createOrReplaceTempView(f"q568_c{k}")
-        prev = f"q568_c{k}"
-    fin = _q568_final(f"q568_c{_Q568_STAGES}",
-                      f"q568_c{_Q568_STAGES - 1}",
-                      "q568_documents", "") \
-        .replace("FROM ev", "FROM q568_ev") \
-        .replace("JOIN ev ", "JOIN q568_ev ")
-    return spark.sql("WITH " + fin)
-
-
-def _q569_sql(tbl: str, mat: str = "") -> str:
-    hcol = lambda t: f"((h.ha*{t} + h.hb) % 61) % 16"
-    return f"""WITH s AS (SELECT doc_id,
-                CASE WHEN doc_id % 4 = 1 THEN 11
-                     WHEN doc_id % 9 = 0 THEN 23
-                     ELSE doc_id % 60 END AS tok,
-                doc_id % 2 AS half
-              FROM {tbl}),
-       fc AS{mat} (SELECT tok, CAST(count(*) AS BIGINT) AS f
-              FROM s GROUP BY tok),
-       hp AS (SELECT * FROM (VALUES (0, 3, 7), (1, 5, 11),
-              (2, 17, 2)) t(r, ha, hb)),
-       cells AS{mat} (SELECT h.r, {hcol('s.tok')} AS col,
-                CAST(count(*) AS BIGINT) AS c,
-                CAST(sum(CASE WHEN s.half = 0 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS ch0,
-                CAST(sum(CASE WHEN s.half = 1 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS ch1
-              FROM s CROSS JOIN hp h GROUP BY h.r, {hcol('s.tok')}),
-       mg AS{mat} (SELECT
-                CAST(sum(abs(c - ch0 - ch1)) AS BIGINT)
-                  AS merge_resid,
-                CAST(count(*) AS BIGINT) AS n_cells,
-                CAST(max(c) AS BIGINT) AS max_cell FROM cells),
-       est AS{mat} (SELECT f.tok, f.f,
-                CAST(min(c.c) AS BIGINT) AS est,
-                CAST(min(c.c) - f.f AS BIGINT) AS overcount,
-                CAST(max(CASE WHEN c.c < f.f THEN 1 ELSE 0 END)
-                     AS BIGINT) AS any_under
-              FROM fc f CROSS JOIN hp h
-              JOIN cells c ON c.r = h.r
-                AND c.col = {hcol('f.tok')}
-              GROUP BY f.tok, f.f),
-       coll AS{mat} (SELECT f.tok, h.r,
-                CAST(sum(CASE WHEN g.tok <> f.tok THEN g.f
-                         ELSE 0 END) AS BIGINT) AS cmass
-              FROM fc f CROSS JOIN hp h
-              JOIN fc g ON {hcol('g.tok')} = {hcol('f.tok')}
-              GROUP BY f.tok, h.r),
-       dec AS{mat} (SELECT f.tok,
-                CAST(sum(abs(c.c - f.f - l.cmass)) AS BIGINT)
-                  AS dec_resid
-              FROM fc f CROSS JOIN hp h
-              JOIN cells c ON c.r = h.r
-                AND c.col = {hcol('f.tok')}
-              JOIN coll l ON l.tok = f.tok AND l.r = h.r
-              GROUP BY f.tok),
-       gl AS{mat} (SELECT
-                CAST(sum(CASE WHEN overcount = 0 THEN 1 ELSE 0
-                         END) AS BIGINT) AS n_exact_tokens,
-                CAST(sum(CASE WHEN overcount > 0 THEN 1 ELSE 0
-                         END) AS BIGINT) AS n_over_tokens,
-                CAST(count(*) AS BIGINT) AS n_tokens,
-                CAST(sum(any_under) AS BIGINT) AS n_under
-              FROM est),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(e.tok AS BIGINT) AS tok, e.f AS f_true,
-              e.est, e.overcount, e.any_under, d.dec_resid,
-              CAST(CASE WHEN e.overcount = 0 THEN 1 ELSE 0 END
-                   AS BIGINT) AS is_exact,
-              g.n_exact_tokens, g.n_over_tokens, g.n_tokens,
-              g.n_under, m.merge_resid, m.n_cells, m.max_cell,
-              ld.n_docs
-       FROM est e JOIN dec d ON d.tok = e.tok
-       CROSS JOIN gl g CROSS JOIN mg m CROSS JOIN ld"""
-
-
-@query("q569_count_min_sketch", _q569_sql("documents",
-                                          " MATERIALIZED"))
-def q569(spark, sf_dir):
-    """Count-min sketch error ANATOMY (Cormode & Muthukrishnan
-    2005) — the OVER-estimating dual of q563's Misra-Gries.  q278
-    and q328 DEPLOY this sketch (md5-rowed term frequencies, a
-    streaming twin); this query proves the machinery those rely
-    on, on a fixture engineered so every error regime is live:
-    d = 3 hash rows x w = 16 counters, point estimate = min over
-    rows of the hashed cell; cell-wise ADD is the merge.  The entire error
-    anatomy is COMPUTED per token, never cited: the decomposition
-    identity cell[r, h_r(x)] = f(x) + sum of colliding mass is
-    verified per (token, row) from TWO INDEPENDENT aggregations
-    (stream-level cell counts vs a token-level frequency self-join
-    on hash equality) — dec_resid == 0 on all 45 tokens x 3 rows;
-    any_under == 0 is the one-sided guarantee (a counter can never
-    undercount — the mirror of MG's never-overcount); and
-    merge_resid == 0 proves distributability by splitting the
-    corpus in half, sketching each half with the same aggregation
-    shape, and checking cell-wise addition reassembles the full
-    sketch exactly.  The fixture keeps BOTH estimate regimes alive
-    (the q503 dead-branch lesson): 45 distinct tokens pile into 48
-    cells by pigeonhole, 44 estimates genuinely overcount (worst
-    +22 at sf0.001) while exactly one token wins a collision-free
-    row in all three hashes — n_exact_tokens == 1 and
-    n_over_tokens == 44 emitted from the data.  Planted heavies
-    (11 every 4th doc, 23 every 9th) dominate max_cell.  Pure
-    aggregation end-to-end: the sketch is 48 rows regardless of
-    corpus size — the map-side-combinable shape that survives
-    100 TB."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q569_documents")
-    return spark.sql(_q569_sql("q569_documents"))
-
-
-# --- Floyd-Steinberg dithering + Canny edges (q570-q571) ----------------------------------
-
-
-def _q570_grid(tbl: str, divop: str) -> str:
-    return (
-        f"grid AS (SELECT iid, r, c,\n"
-        f"         CAST(CASE WHEN iid = 0 THEN 127\n"
-        f"              WHEN iid = 1 THEN (c*255) {divop} 11\n"
-        f"              WHEN iid = 2 THEN"
-        f" (r*37 + c*53 + r*c*11 + 29) % 256\n"
-        f"              ELSE CASE WHEN c < 6 THEN 0 ELSE 255 END\n"
-        f"         END AS BIGINT) AS v\n"
-        f"         FROM (SELECT i {divop} 96 AS iid,\n"
-        f"                 (i % 96) {divop} 12 AS r, i % 12 AS c\n"
-        f"               FROM (SELECT DISTINCT doc_id % 384 AS i\n"
-        f"                     FROM {tbl}) t) t2)")
-
-
-def _q570_sh(m: int, divop: str) -> str:
-    e = f"p.err*{m}"
-    return f"(({e}) - ((({e}) % 16) + 16) % 16) {divop} 16"
-
-
-def _q570_stage(d: int, prevs: list, divop: str) -> str:
-    s7, s3, s5 = (_q570_sh(m, divop) for m in (7, 3, 5))
-    pu = "\n           UNION ALL ".join(
-        f"SELECT * FROM {p}" for p in prevs)
-    src = f"(SELECT iid, r, c, err FROM ({pu}) u) p" if prevs \
-        else None
-    if src is None:
-        join, errin = "", "CAST(0 AS BIGINT) AS errin"
-    else:
-        join = (
-            f"       LEFT JOIN {src} ON p.iid = g.iid\n"
-            f"         AND ((p.r = g.r AND p.c = g.c - 1)\n"
-            f"           OR (p.r = g.r - 1\n"
-            f"               AND p.c BETWEEN g.c - 1 AND g.c + 1))\n")
-        errin = (
-            f"coalesce(sum(CASE\n"
-            f"           WHEN p.r = g.r AND p.c = g.c - 1"
-            f" THEN {s7}\n"
-            f"           WHEN p.r = g.r - 1 AND p.c = g.c + 1"
-            f" THEN {s3}\n"
-            f"           WHEN p.r = g.r - 1 AND p.c = g.c"
-            f" THEN {s5}\n"
-            f"           WHEN p.r = g.r - 1 AND p.c = g.c - 1\n"
-            f"             THEN p.err - ({s7}) - ({s3}) - ({s5})\n"
-            f"         END), CAST(0 AS BIGINT)) AS errin")
-    return (
-        f"SELECT iid, r, c, v, errin, v + errin AS old,\n"
-        f"         CASE WHEN v + errin >= 128 THEN 255 ELSE 0 END"
-        f" AS new,\n"
-        f"         v + errin - CASE WHEN v + errin >= 128"
-        f" THEN 255 ELSE 0 END AS err\n"
-        f"       FROM (SELECT g.iid, g.r, g.c, g.v,\n"
-        f"           {errin}\n"
-        f"         FROM grid g\n{join}"
-        f"         WHERE 2*g.r + g.c = {d}\n"
-        f"         GROUP BY g.iid, g.r, g.c, g.v) q")
-
-
-def _q570_final(stages: list, tbl: str, divop: str,
-                mat: str) -> str:
-    s7 = _q570_sh(7, divop).replace("p.err", "err")
-    s3 = _q570_sh(3, divop).replace("p.err", "err")
-    s5 = _q570_sh(5, divop).replace("p.err", "err")
-    un = "\n           UNION ALL ".join(
-        f"SELECT * FROM {s}" for s in stages)
-    return (
-        f"allp AS{mat} ({un}),\n"
-        f"       lk AS{mat} (SELECT iid,\n"
-        f"           CAST(sum(CASE WHEN c = 11 THEN {s7} ELSE 0"
-        f" END\n"
-        f"             + CASE WHEN r = 7 OR c = 0 THEN {s3}"
-        f" ELSE 0 END\n"
-        f"             + CASE WHEN r = 7 THEN {s5} ELSE 0 END\n"
-        f"             + CASE WHEN r = 7 OR c = 11\n"
-        f"               THEN err - ({s7}) - ({s3}) - ({s5})"
-        f" ELSE 0 END) AS BIGINT) AS leak\n"
-        f"         FROM allp GROUP BY iid),\n"
-        f"       ag AS{mat} (SELECT iid,\n"
-        f"           CAST(sum(CASE WHEN new = 255 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_white,\n"
-        f"           CAST(sum(CASE WHEN new = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_black,\n"
-        f"           CAST(sum(v) AS BIGINT) AS sum_in,\n"
-        f"           CAST(sum(new) AS BIGINT) AS sum_out,\n"
-        f"           CAST(max(abs(errin)) AS BIGINT)"
-        f" AS max_abs_carry,\n"
-        f"           CAST(sum((r*12 + c + 1)\n"
-        f"             * CASE WHEN new = 255 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS checksum\n"
-        f"         FROM allp GROUP BY iid),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(a.iid AS BIGINT) AS iid,\n"
-        f"              a.n_white, a.n_black, a.sum_in,"
-        f" a.sum_out,\n"
-        f"              l.leak,\n"
-        f"              CAST(a.sum_in - a.sum_out - l.leak"
-        f" AS BIGINT) AS cons_resid,\n"
-        f"              a.max_abs_carry, a.checksum, ld.n_docs\n"
-        f"       FROM ag a JOIN lk l ON l.iid = a.iid\n"
-        f"       CROSS JOIN ld")
-
-
-def _q570_oracle(tbl: str = "documents") -> str:
-    parts = [_q570_grid(tbl, "//")]
-    stages = []
-    for d in range(26):
-        prevs = [f"st{p}" for p in range(max(0, d - 3), d)]
-        parts.append(f"st{d} AS MATERIALIZED (\n"
-                     f"       {_q570_stage(d, prevs, '//')})")
-        stages.append(f"st{d}")
-    parts.append(_q570_final(stages, tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q570_floyd_steinberg", _q570_oracle())
-def q570(spark, sf_dir):
-    """Floyd-Steinberg error-diffusion dithering (1976; the halftone
-    step in every raster export chain — the reference's rgb2pct /
-    dither utility, alg/gdaldither.cpp, diffuses quantization error
-    with exactly these 7/16-3/16-5/16-1/16 shares).  Exactness
-    trick: the 1/16 shares are made ERROR-CONSERVING integers —
-    e7/e3/e5 are floor((err*m)/16) via the pmod identity (floor
-    even for negative err, identical in both engines because the
-    dividend is made exactly divisible before {divop}), and e1 =
-    err - e7 - e3 - e5 absorbs the remainder, so every unit of
-    quantization error is accounted and the global conservation law
-    sum_in == sum_out + boundary_leak holds EXACTLY (cons_resid ==
-    0 per image — FS preserves mean mass, emitted not cited).  The
-    engine and oracle are INDEPENDENT implementations meeting at
-    the output (the q553/q561 template): engine applyInPandas
-    replays the textbook row-major scan per image; oracle unrolls
-    the dependency cone as 26 ANTIDIAGONAL wavefront stages (pixel
-    (r,c) needs only diagonals 2r+c-1, -2, -3 — each stage one
-    LEFT JOIN against the three prior stages, MATERIALIZED).  Four
-    96-px images keep every regime live: flat 127 (the classic
-    serpentine-free FS checkerboard; carry reaches 62), a
-    horizontal gradient, hash texture, and a pure 0/255 step image
-    whose error channel is IDENTICALLY ZERO (max_abs_carry == 0,
-    leak == 0 — the exact-passthrough branch).  n_white ==
-    round(sum_in/255) on every image is the mean-preservation
-    consequence; the position-weighted checksum pins the full
-    bitmap, not just counts."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q570_documents")
-    grid = spark.sql(
-        "WITH " + _q570_grid("q570_documents", "div")
-        + " SELECT * FROM grid")
-    nd = _t(spark, sf_dir, "documents").count()
-
-    def fs(key, g):
-        import pandas as pd
-        iid = int(key[0])
-        g = g.sort_values(["r", "c"])
-        v = {(int(r.r), int(r.c)): int(r.v)
-             for r in g.itertuples()}
-        acc = {}
-        sin = sout = leak = nw = mac = chks = 0
-        for r in range(8):
-            for c in range(12):
-                base = v[(r, c)]
-                sin += base
-                ei = acc.get((r, c), 0)
-                mac = max(mac, abs(ei))
-                old = base + ei
-                new = 255 if old >= 128 else 0
-                sout += new
-                if new == 255:
-                    nw += 1
-                    chks += r * 12 + c + 1
-                err = old - new
-                e7 = (err * 7) // 16
-                e3 = (err * 3) // 16
-                e5 = (err * 5) // 16
-                e1 = err - e7 - e3 - e5
-                for dr, dc, e in ((0, 1, e7), (1, -1, e3),
-                                  (1, 0, e5), (1, 1, e1)):
-                    rr, cc = r + dr, c + dc
-                    if 0 <= rr < 8 and 0 <= cc < 12:
-                        acc[(rr, cc)] = acc.get((rr, cc), 0) + e
-                    else:
-                        leak += e
-        return pd.DataFrame(
-            {"iid": [iid], "n_white": [nw], "n_black": [96 - nw],
-             "sum_in": [sin], "sum_out": [sout], "leak": [leak],
-             "cons_resid": [sin - sout - leak],
-             "max_abs_carry": [mac], "checksum": [chks],
-             "n_docs": [nd]})
-
-    return grid.groupBy("iid").applyInPandas(
-        fs, "iid long, n_white long, n_black long, sum_in long, "
-            "sum_out long, leak long, cons_resid long, "
-            "max_abs_carry long, checksum long, n_docs long")
-
-
-def _q571_base(tbl: str, divop: str, mat: str) -> str:
-    return (
-        f"img AS (SELECT cell {divop} 12 AS r, cell % 12 AS c,\n"
-        f"         CAST((cell {divop} 12)*19 + (cell % 12)*31\n"
-        f"              + (cell {divop} 12)*(cell % 12)*7 + 11"
-        f" AS BIGINT) % 40\n"
-        f"         + CASE WHEN cell % 12 = 4 AND cell {divop} 12"
-        f" BETWEEN 1 AND 8 THEN 180 ELSE 0 END\n"
-        f"         + CASE WHEN cell {divop} 12 = 6 AND cell % 12"
-        f" BETWEEN 5 AND 10 THEN 60 ELSE 0 END\n"
-        f"         + CASE WHEN cell {divop} 12 = 2 AND cell % 12"
-        f" BETWEEN 7 AND 9 THEN 55 ELSE 0 END AS v\n"
-        f"         FROM (SELECT DISTINCT doc_id % 120 AS cell"
-        f" FROM {tbl}) t),\n"
-        f"       grad AS{mat} (SELECT p.r, p.c,\n"
-        f"           sum(CASE WHEN n.c = p.c + 1 THEN\n"
-        f"                 CASE WHEN n.r = p.r THEN 2 ELSE 1 END\n"
-        f"               WHEN n.c = p.c - 1 THEN\n"
-        f"                 -(CASE WHEN n.r = p.r THEN 2 ELSE 1"
-        f" END)\n"
-        f"               ELSE 0 END * n.v) AS gx,\n"
-        f"           sum(CASE WHEN n.r = p.r + 1 THEN\n"
-        f"                 CASE WHEN n.c = p.c THEN 2 ELSE 1 END\n"
-        f"               WHEN n.r = p.r - 1 THEN\n"
-        f"                 -(CASE WHEN n.c = p.c THEN 2 ELSE 1"
-        f" END)\n"
-        f"               ELSE 0 END * n.v) AS gy\n"
-        f"         FROM img p JOIN img n\n"
-        f"           ON abs(n.r - p.r) <= 1 AND abs(n.c - p.c)"
-        f" <= 1\n"
-        f"          AND (n.r <> p.r OR n.c <> p.c)\n"
-        f"         WHERE p.r BETWEEN 1 AND 8 AND p.c BETWEEN 1"
-        f" AND 10\n"
-        f"         GROUP BY p.r, p.c),\n"
-        f"       gs AS{mat} (SELECT r, c, gx, gy,\n"
-        f"           gx*gx + gy*gy AS m2,\n"
-        f"           CASE WHEN 2*abs(gy) <= abs(gx) THEN 0\n"
-        f"                WHEN 2*abs(gx) <= abs(gy) THEN 2\n"
-        f"                WHEN gx*gy > 0 THEN 1 ELSE 3 END"
-        f" AS sect\n"
-        f"         FROM grad),\n"
-        f"       nms AS{mat} (SELECT a.r, a.c, a.m2, a.sect\n"
-        f"         FROM gs a\n"
-        f"         LEFT JOIN gs b ON\n"
-        f"           ((a.sect = 0 AND b.r = a.r"
-        f" AND abs(b.c - a.c) = 1)\n"
-        f"            OR (a.sect = 2 AND b.c = a.c"
-        f" AND abs(b.r - a.r) = 1)\n"
-        f"            OR (a.sect = 1 AND abs(b.r - a.r) = 1\n"
-        f"                AND b.c - a.c = b.r - a.r)\n"
-        f"            OR (a.sect = 3 AND abs(b.r - a.r) = 1\n"
-        f"                AND b.c - a.c = -(b.r - a.r)))\n"
-        f"           AND b.m2*256 + b.r*12 + b.c\n"
-        f"               > a.m2*256 + a.r*12 + a.c\n"
-        f"         GROUP BY a.r, a.c, a.m2, a.sect\n"
-        f"         HAVING count(b.r) = 0),\n"
-        f"       cand AS{mat} (SELECT r, c, m2, r*12 + c AS pid,\n"
-        f"           CASE WHEN m2 >= 200000 THEN 2 ELSE 1 END"
-        f" AS cls\n"
-        f"         FROM nms WHERE m2 >= 30000),\n"
-        f"       c0 AS{mat} (SELECT pid AS a, pid AS b FROM cand\n"
-        f"         UNION\n"
-        f"         SELECT x.pid AS a, y.pid AS b\n"
-        f"         FROM cand x JOIN cand y\n"
-        f"           ON greatest(abs(x.r - y.r), abs(x.c - y.c))"
-        f" = 1)")
-
-
-def _q571_final(cF: str, cP: str, tbl: str, mat: str) -> str:
-    return (
-        f"fine AS{mat} (SELECT DISTINCT t.b AS pid\n"
-        f"         FROM {cF} t JOIN cand s ON s.pid = t.a"
-        f" AND s.cls = 2),\n"
-        f"       fo AS{mat} (SELECT d.r, d.c, d.m2, d.cls,\n"
-        f"           CASE WHEN d.cls = 1 THEN 1 ELSE 0 END"
-        f" AS promoted\n"
-        f"         FROM cand d JOIN fine f ON f.pid = d.pid),\n"
-        f"       gl AS{mat} (SELECT\n"
-        f"           CAST((SELECT count(*) FROM nms) AS BIGINT)"
-        f" AS n_nms,\n"
-        f"           CAST((SELECT count(*) FROM cand"
-        f" WHERE cls = 2) AS BIGINT) AS n_strong,\n"
-        f"           CAST((SELECT count(*) FROM cand"
-        f" WHERE cls = 1) AS BIGINT) AS n_weak,\n"
-        f"           CAST((SELECT count(*) FROM fo"
-        f" WHERE promoted = 1) AS BIGINT) AS n_promoted,\n"
-        f"           CAST((SELECT count(*) FROM cand)\n"
-        f"             - (SELECT count(*) FROM fo) AS BIGINT)"
-        f" AS n_dropped,\n"
-        f"           CAST((SELECT count(*) FROM {cF})\n"
-        f"             - (SELECT count(*) FROM {cP}) AS BIGINT)"
-        f" AS closure_resid,\n"
-        f"           CAST((SELECT sum(CASE WHEN sect = 0 THEN"
-        f" 1000000 WHEN sect = 1 THEN 10000\n"
-        f"                 WHEN sect = 2 THEN 100 ELSE 1 END)"
-        f" FROM gs) AS BIGINT) AS sectors_packed,\n"
-        f"           CAST((SELECT count(*) FROM cand d\n"
-        f"              JOIN fo f ON greatest(abs(f.r - d.r),"
-        f" abs(f.c - d.c)) = 1\n"
-        f"              WHERE NOT EXISTS (SELECT 1 FROM fo f2\n"
-        f"                WHERE f2.r = d.r AND f2.c = d.c))"
-        f" AS BIGINT) AS n_dropped_adj_final,\n"
-        f"           CAST((SELECT min(nb) FROM (SELECT f.r, f.c,\n"
-        f"                 (SELECT count(*) FROM fo f2\n"
-        f"                  WHERE greatest(abs(f2.r - f.r),"
-        f" abs(f2.c - f.c)) = 1) AS nb\n"
-        f"               FROM fo f WHERE f.promoted = 1) q)"
-        f" AS BIGINT) AS min_promoted_nbrs),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(f.r AS BIGINT) AS r,\n"
-        f"              CAST(f.c AS BIGINT) AS c,\n"
-        f"              CAST(f.m2 AS BIGINT) AS m2,\n"
-        f"              CAST(f.cls AS BIGINT) AS cls,\n"
-        f"              CAST(f.promoted AS BIGINT) AS promoted,\n"
-        f"              g.n_nms, g.n_strong, g.n_weak,\n"
-        f"              g.n_promoted, g.n_dropped,\n"
-        f"              g.closure_resid, g.sectors_packed,\n"
-        f"              g.n_dropped_adj_final,"
-        f" g.min_promoted_nbrs,\n"
-        f"              ld.n_docs\n"
-        f"       FROM fo f CROSS JOIN gl g CROSS JOIN ld")
-
-
-_Q571_STAGES = 5
-
-
-def _q571_oracle(tbl: str = "documents") -> str:
-    parts = [_q571_base(tbl, "//", " MATERIALIZED")]
-    for k in range(1, _Q571_STAGES + 1):
-        parts.append(f"c{k} AS MATERIALIZED (\n"
-                     f"       {_q568_double(f'c{k - 1}')})")
-    parts.append(_q571_final(f"c{_Q571_STAGES}",
-                             f"c{_Q571_STAGES - 1}", tbl,
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q571_canny_edges", _q571_oracle())
-def q571(spark, sf_dir):
-    """Canny edge detection in EXACT integer arithmetic (Canny
-    1986; the edge extractor upstream of q547's Hough lines — the
-    reference's image pipeline kin).  All three stages are
-    relational and division-free: (1) Sobel gx/gy as ONE
-    8-neighbor join-aggregation (the focal halo shape), magnitude
-    kept SQUARED (m2 = gx^2 + gy^2 — no sqrt anywhere); (2)
-    non-maximum suppression with the gradient direction quantized
-    by EXACT rational gates (sector 0/2 iff 2|gy| <= |gx| /
-    2|gx| <= |gy|, diagonals by sign(gx*gy) — the q74/q558 octant
-    dodge: no atan2, no transcendental, and all four sectors
-    genuinely fire, sectors_packed == 35082908), survivors =
-    pixels whose packed key m2*256 + pos strictly dominates both
-    sector neighbors (min-as-tie-rule, q517 idiom); (3) hysteresis
-    as REACHABILITY FROM THE STRONG SET through weak pixels —
-    pointer-doubling closure over the candidate adjacency (the
-    q568 machinery), 5 stages with the fixpoint emitted
-    (closure_resid == 0).  The 10x12 fixture plants a strong
-    vertical ridge, a weak horizontal ridge ATTACHED to it (its 11
-    pixels promote — the continuity rescue that is hysteresis's
-    whole point), and an isolated weak blob (2 pixels die:
-    n_dropped == 2 — the noise-rejection branch).  The verdict
-    self-certifies beyond the closure: n_dropped_adj_final == 0
-    proves no dropped pixel touches the final edge set (final is
-    closed under weak adjacency — a fixpoint witness INDEPENDENT
-    of the stage count), and min_promoted_nbrs >= 1 proves every
-    promoted weak pixel is connected into the edge structure.
-    n_nms == 46, n_strong == 16, n_weak == 13.  Scale: Sobel+NMS
-    are halo joins, hysteresis is O(log diameter) doubling — the
-    distributed-CC shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q571_documents")
-    base = _q571_base("q571_documents", "div", "")
-    for tv in ("img", "grad", "gs", "nms", "cand", "c0"):
-        df = spark.sql(f"WITH {base} SELECT * FROM {tv}") \
-            .localCheckpoint()
-        df.createOrReplaceTempView(f"q571_{tv}")
-    prev = "q571_c0"
-    for k in range(1, _Q571_STAGES + 1):
-        d = spark.sql(_q568_double(prev)).localCheckpoint(
-            eager=False)
-        d.createOrReplaceTempView(f"q571_c{k}")
-        prev = f"q571_c{k}"
-    fin = _q571_final(f"q571_c{_Q571_STAGES}",
-                      f"q571_c{_Q571_STAGES - 1}",
-                      "q571_documents", "") \
-        .replace("FROM cand", "FROM q571_cand") \
-        .replace("JOIN cand s", "JOIN q571_cand s") \
-        .replace("FROM nms", "FROM q571_nms") \
-        .replace("FROM gs", "FROM q571_gs")
-    return spark.sql("WITH " + fin)
-
-
-# --- Elias-Fano postings + Mann-Whitney AUC (q572-q573) -----------------------------------
-
-
-def _q572_sql(tbl: str, divop: str, mat: str = "") -> str:
-    p2 = ", ".join(f"({e}, {1 << e})" for e in range(21))
-    return f"""WITH s AS (SELECT doc_id % 8 AS term, doc_id AS x FROM {tbl}),
-       u AS (SELECT CAST(max(x) + 1 AS BIGINT) AS uni FROM s),
-       tn AS{mat} (SELECT term, CAST(count(*) AS BIGINT) AS n
-              FROM s GROUP BY term),
-       p2 AS (SELECT * FROM (VALUES {p2}) t(e, v)),
-       lsel AS{mat} (SELECT t.term, t.n, u.uni,
-                CAST(max(p.e) AS BIGINT) AS l,
-                CAST(max(p.v) AS BIGINT) AS pw
-              FROM tn t CROSS JOIN u
-              JOIN p2 p ON p.v * t.n <= u.uni
-              GROUP BY t.term, t.n, u.uni),
-       enc AS{mat} (SELECT s.term, s.x,
-                CAST(row_number() OVER (PARTITION BY s.term
-                     ORDER BY s.x) - 1 AS BIGINT) AS i,
-                CAST(s.x % l2.pw AS BIGINT) AS lo,
-                CAST(s.x {divop} l2.pw AS BIGINT) AS hi
-              FROM s JOIN lsel l2 ON l2.term = s.term),
-       pos AS{mat} (SELECT term, x, i, lo, hi, hi + i AS p
-              FROM enc),
-       dec AS{mat} (SELECT d.term,
-                (d.p - d.j)*l2.pw + la.lo AS xdec, la.x AS xorig
-              FROM (SELECT term, p,
-                      CAST(row_number() OVER (PARTITION BY term
-                           ORDER BY p) - 1 AS BIGINT) AS j
-                    FROM pos) d
-              JOIN pos la ON la.term = d.term AND la.i = d.j
-              JOIN lsel l2 ON l2.term = d.term),
-       rt AS{mat} (SELECT term,
-                CAST(sum(abs(xdec - xorig)) AS BIGINT)
-                  AS roundtrip_resid
-              FROM dec GROUP BY term),
-       mono AS{mat} (SELECT term,
-                CAST(sum(CASE WHEN ph > hi THEN 1 ELSE 0 END)
-                     AS BIGINT) AS hi_monotone_viol,
-                CAST(max(hi) AS BIGINT) AS max_hi
-              FROM (SELECT term, hi,
-                      lag(hi, 1, CAST(0 AS BIGINT))
-                        OVER (PARTITION BY term ORDER BY i) AS ph
-                    FROM pos) q GROUP BY term),
-       rawb AS (SELECT CAST(min(e) AS BIGINT) AS lg
-              FROM p2 CROSS JOIN u WHERE v >= uni),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT l2.term, l2.n, l2.uni, l2.l,
-              CAST(l2.n * l2.l AS BIGINT) AS bits_low,
-              CAST(l2.n + m.max_hi + 1 AS BIGINT) AS bits_high,
-              CAST(l2.n * l2.l + l2.n + m.max_hi + 1 AS BIGINT)
-                AS bits_total,
-              CAST(l2.n * r2.lg AS BIGINT) AS raw_bits,
-              CAST(CASE WHEN l2.n * l2.l + l2.n + m.max_hi + 1
-                        <= l2.n * l2.l + 3 * l2.n
-                   THEN 1 ELSE 0 END AS BIGINT) AS bound_ok,
-              rt.roundtrip_resid, m.hi_monotone_viol, ld.n_docs
-       FROM lsel l2
-       JOIN rt ON rt.term = l2.term
-       JOIN mono m ON m.term = l2.term
-       CROSS JOIN rawb r2 CROSS JOIN ld"""
-
-
-@query("q572_elias_fano", _q572_sql("documents", "//",
-                                    " MATERIALIZED"))
-def q572(spark, sf_dir):
-    """Elias-Fano succinct encoding of posting lists (Elias 1974 /
-    Vigna's quasi-succinct indices — THE inverted-index compression
-    every production search engine ships; the q19/q166 n-gram
-    machinery's storage layer).  Each term's sorted doc-id list
-    splits at l = floor(log2(U/n)) bits: low halves stored verbatim
-    (n*l bits), high halves unary-coded into a bitvector where
-    element i sets bit hi_i + i (n + max_hi + 1 bits).  Everything
-    is relational and division-free: l is selected by joining a
-    21-row power dim (max e with 2^e * n <= U — no log), positions
-    are strictly increasing by construction, and DECODE is the real
-    select-based path, not an echo: the j-th smallest set bit p_j
-    recovers hi = p_j - j, re-joins the low array AT INDEX j, and
-    roundtrip_resid == 0 per term certifies x == (p_j - j)*2^l +
-    lo_j on every posting.  The space theorem is COMPUTED: l's
-    maximality forces max_hi < 2n, so bits_total <= n*l + 3n
-    (bound_ok == 1 — the n(2 + log2(U/n))-bit quasi-succinct
-    guarantee in integer form), compared against raw_bits = n *
-    ceil(log2 U); hi_monotone_viol == 0 is the structural
-    invariant select-decoding relies on.  Postings are the REAL
-    doc ids (lists and U scale with SF).  Scale story: encode is
-    one window per term, decode one join — both
-    partition-parallel by term."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q572_documents")
-    return spark.sql(_q572_sql("q572_documents", "div"))
-
-
-def _q573_sql(tbl: str, mat: str = "") -> str:
-    return f"""WITH s AS (SELECT doc_id % 4 AS host,
-                CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS pos,
-                CAST(CASE WHEN doc_id % 5 = 0
-                     THEN (doc_id*doc_id*3 + doc_id*11 + 7) % 37
-                          + 10
-                     ELSE (doc_id*doc_id*7 + doc_id*3 + 5) % 43
-                END AS BIGINT) AS score
-              FROM {tbl}),
-       pw AS{mat} (SELECT p.host,
-                CAST(sum(CASE WHEN p.score > n.score THEN 2
-                         WHEN p.score = n.score THEN 1
-                         ELSE 0 END) AS BIGINT) AS u2_pair,
-                CAST(sum(CASE WHEN p.score = n.score THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_tied,
-                CAST(sum(CASE WHEN p.score > n.score THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_conc,
-                CAST(sum(CASE WHEN p.score < n.score THEN 1
-                         ELSE 0 END) AS BIGINT) AS n_disc
-              FROM s p JOIN s n ON n.host = p.host
-                AND p.pos = 1 AND n.pos = 0
-              GROUP BY p.host),
-       vc AS{mat} (SELECT host, score,
-                CAST(count(*) AS BIGINT) AS cnt,
-                CAST(sum(CASE WHEN pos = 1 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS cpos
-              FROM s GROUP BY host, score),
-       rk AS{mat} (SELECT host, score, cnt, cpos,
-                CAST(coalesce(sum(cnt) OVER (PARTITION BY host
-                     ORDER BY score ROWS BETWEEN UNBOUNDED
-                     PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                  AS smaller
-              FROM vc),
-       rf AS{mat} (SELECT host,
-                CAST(sum(cpos * (2*smaller + cnt + 1)) AS BIGINT)
-                  AS r2,
-                CAST(sum(cpos) AS BIGINT) AS n1,
-                CAST(sum(cnt - cpos) AS BIGINT) AS n0
-              FROM rk GROUP BY host),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(f.host AS BIGINT) AS host, f.n1, f.n0,
-              p.u2_pair,
-              CAST(f.r2 - f.n1*(f.n1 + 1) AS BIGINT) AS u2_rank,
-              CAST(p.u2_pair - (f.r2 - f.n1*(f.n1 + 1))
-                   AS BIGINT) AS resid,
-              p.n_tied, p.n_conc, p.n_disc,
-              CAST(p.n_conc + p.n_disc + p.n_tied
-                   - f.n1*f.n0 AS BIGINT) AS pair_count_resid,
-              p.u2_pair AS auc_num,
-              CAST(2*f.n1*f.n0 AS BIGINT) AS auc_den,
-              ld.n_docs
-       FROM rf f JOIN pw p ON p.host = f.host CROSS JOIN ld"""
-
-
-@query("q573_mann_whitney_auc", _q573_sql("documents",
-                                          " MATERIALIZED"))
-def q573(spark, sf_dir):
-    """ROC AUC as the Mann-Whitney U statistic (Mann & Whitney
-    1947; Hanley & McNeil 1982 — the classifier-eval number behind
-    every quality-model dashboard; joins q438 NDCG / q497 RBO /
-    q480 isotonic in the eval family).  AUC = P(score_pos >
-    score_neg) + P(tie)/2, kept EXACT by working in doubled units:
-    2U = #concordant*2 + #tied.  The statistic is computed TWO
-    INDEPENDENT ways that certify each other per host: the
-    pairwise definition (an O(n1*n0) positives x negatives join —
-    the verification path) and the midrank FORMULA 2U = 2*R1 -
-    n1(n1+1) with 2*R1 = sum over positives of (2*below + cnt + 1)
-    (two window aggregations — the O(n log n) path that scales);
-    resid == 0 on every host is the tie-corrected rank identity as
-    a computed integer.  Tie handling is genuinely exercised: the
-    score hashes use prime moduli 37/43 COPRIME to the host x
-    class lattice (the q323/q351 gcd lesson, quadratic edition —
-    three successive fixture designs collapsed to constant or
-    disjoint scores because the modulus divided the selector
-    lattice), leaving 28-41 tied pairs per host at sf0.001;
-    pair_count_resid == 0 re-derives n_conc + n_disc + n_tied ==
-    n1*n0.  AUC ships as the exact rational (auc_num, auc_den) —
-    no float crosses the comparator.  Positives carry a +10 shift:
-    AUC lands 0.60-0.68, above chance on every host."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q573_documents")
-    return spark.sql(_q573_sql("q573_documents"))
-
-
-# --- Burrows-Wheeler transform + Merkle tree (q574-q575) ----------------------------------
-
-
-_Q574_S = "abracadabraabracadabra$"
-_Q574_CODE = {"$": 0, "a": 1, "b": 2, "c": 3, "d": 4, "r": 5}
-_Q574_N = len(_Q574_S)
-
-
-def _q574_base(tbl: str) -> str:
-    cs = " ".join(f"WHEN {i} THEN {_Q574_CODE[ch]}"
-                  for i, ch in enumerate(_Q574_S))
-    return (
-        f"tx AS (SELECT i AS pos,\n"
-        f"           CAST(CASE i {cs} END AS BIGINT) AS code\n"
-        f"         FROM (SELECT DISTINCT doc_id % {_Q574_N} AS i"
-        f" FROM {tbl}) t),\n"
-        f"       r0 AS (SELECT pos, code AS r FROM tx)")
-
-
-def _q574_rank(prev: str, shift: int) -> str:
-    return (
-        f"SELECT a.pos,\n"
-        f"         CAST(dense_rank() OVER (ORDER BY a.r*32 + b.r)"
-        f" - 1 AS BIGINT) AS r\n"
-        f"       FROM {prev} a JOIN {prev} b\n"
-        f"         ON b.pos = (a.pos + {shift}) % {_Q574_N}")
-
-
-def _q574_post(rF: str, tbl: str, mat: str) -> str:
-    n = _Q574_N
-    return (
-        f"bwt AS{mat} (SELECT r.r AS rw, t.code AS bc\n"
-        f"         FROM {rF} r JOIN tx t\n"
-        f"           ON t.pos = (r.pos + {n - 1}) % {n}),\n"
-        f"       cc AS{mat} (SELECT a.bc,\n"
-        f"           CAST(sum(CASE WHEN b.bc < a.bc THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS c\n"
-        f"         FROM (SELECT DISTINCT bc FROM bwt) a\n"
-        f"         CROSS JOIN bwt b GROUP BY a.bc),\n"
-        f"       lf AS{mat} (SELECT b.rw,\n"
-        f"           CAST(c.c + count(*) OVER (PARTITION BY b.bc\n"
-        f"             ORDER BY b.rw ROWS BETWEEN UNBOUNDED"
-        f" PRECEDING AND CURRENT ROW) - 1 AS BIGINT) AS toro\n"
-        f"         FROM bwt b JOIN cc c ON c.bc = b.bc),\n"
-        f"       j1 AS{mat} (SELECT rw AS a, toro AS b FROM lf),\n"
-        f"       j2 AS{mat} (SELECT x.a, y.b FROM j1 x"
-        f" JOIN j1 y ON y.a = x.b),\n"
-        f"       j4 AS{mat} (SELECT x.a, y.b FROM j2 x"
-        f" JOIN j2 y ON y.a = x.b),\n"
-        f"       j8 AS{mat} (SELECT x.a, y.b FROM j4 x"
-        f" JOIN j4 y ON y.a = x.b),\n"
-        f"       j16 AS{mat} (SELECT x.a, y.b FROM j8 x"
-        f" JOIN j8 y ON y.a = x.b),\n"
-        f"       p0 AS (SELECT r.r AS rw, CAST(0 AS BIGINT) AS k\n"
-        f"         FROM {rF} r WHERE r.pos = 0),\n"
-        f"       p1 AS{mat} (SELECT rw, k FROM p0 UNION ALL\n"
-        f"         SELECT j.b AS rw, p.k + 1 FROM p0 p\n"
-        f"         JOIN j1 j ON j.a = p.rw),\n"
-        f"       p2 AS{mat} (SELECT rw, k FROM p1 UNION ALL\n"
-        f"         SELECT j.b AS rw, p.k + 2 FROM p1 p\n"
-        f"         JOIN j2 j ON j.a = p.rw),\n"
-        f"       p3 AS{mat} (SELECT rw, k FROM p2 UNION ALL\n"
-        f"         SELECT j.b AS rw, p.k + 4 FROM p2 p\n"
-        f"         JOIN j4 j ON j.a = p.rw),\n"
-        f"       p4 AS{mat} (SELECT rw, k FROM p3 UNION ALL\n"
-        f"         SELECT j.b AS rw, p.k + 8 FROM p3 p\n"
-        f"         JOIN j8 j ON j.a = p.rw),\n"
-        f"       p5 AS{mat} (SELECT rw, k FROM p4 UNION ALL\n"
-        f"         SELECT j.b AS rw, p.k + 16 FROM p4 p\n"
-        f"         JOIN j16 j ON j.a = p.rw),\n"
-        f"       orb AS{mat} (SELECT rw, CAST(min(k) AS BIGINT)"
-        f" AS k FROM p5 GROUP BY rw),\n"
-        f"       rec AS{mat} (SELECT {n} - 1 - o.k AS pos,"
-        f" b.bc AS rc\n"
-        f"         FROM orb o JOIN bwt b ON b.rw = o.rw\n"
-        f"         WHERE o.k < {n}),\n"
-        f"       rr AS{mat} (SELECT\n"
-        f"           CAST(sum(abs(t.code - r.rc)) AS BIGINT)"
-        f" AS text_resid,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_rec\n"
-        f"         FROM tx t JOIN rec r ON r.pos = t.pos),\n"
-        f"       rn AS{mat} (SELECT\n"
-        f"           CAST((SELECT 1 + sum(CASE WHEN code <> pc"
-        f" THEN 1 ELSE 0 END)\n"
-        f"             FROM (SELECT code, lag(code) OVER (ORDER BY"
-        f" pos) AS pc FROM tx) q\n"
-        f"             WHERE pc IS NOT NULL) AS BIGINT)"
-        f" AS runs_text,\n"
-        f"           CAST((SELECT 1 + sum(CASE WHEN bc <> pb"
-        f" THEN 1 ELSE 0 END)\n"
-        f"             FROM (SELECT bc, lag(bc) OVER (ORDER BY"
-        f" rw) AS pb FROM bwt) q\n"
-        f"             WHERE pb IS NOT NULL) AS BIGINT)"
-        f" AS runs_bwt,\n"
-        f"           CAST((SELECT count(DISTINCT toro) FROM lf)"
-        f" AS BIGINT) AS lf_distinct),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT t.pos, t.code, r.rc AS rec_code,\n"
-        f"              b.bc AS bwt_code,\n"
-        f"              rr.text_resid, rr.n_rec,\n"
-        f"              rn.runs_text, rn.runs_bwt,"
-        f" rn.lf_distinct,\n"
-        f"              ld.n_docs\n"
-        f"       FROM tx t\n"
-        f"       JOIN rec r ON r.pos = t.pos\n"
-        f"       JOIN bwt b ON b.rw = t.pos\n"
-        f"       CROSS JOIN rr CROSS JOIN rn CROSS JOIN ld")
-
-
-def _q574_oracle(tbl: str = "documents") -> str:
-    parts = [_q574_base(tbl)]
-    prev = "r0"
-    for k in range(5):
-        parts.append(f"rk{k + 1} AS MATERIALIZED (\n"
-                     f"       {_q574_rank(prev, 1 << k)})")
-        prev = f"rk{k + 1}"
-    parts.append(_q574_post(prev, tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q574_bwt_roundtrip", _q574_oracle())
-def q574(spark, sf_dir):
-    """Burrows-Wheeler transform with select-free inverse (Burrows
-    & Wheeler 1994 — the permutation under bzip2 and every
-    FM-indexed search structure; the q308/q34 rolling-hash family's
-    compression-side sibling).  Three pointer-doubling machines
-    compose, all exact BIGINT: (1) the rotation sort is
-    prefix-doubling rank refinement over the CYCLIC string (5
-    stages of fold r*32 + r[(pos+2^k) mod n] then dense_rank — the
-    suffix-array machinery of operators/suffix.py in query form;
-    the sentinel makes final ranks a permutation); (2) the LF
-    mapping is built relationally from first principles — C[c] by
-    a counting join, occ by a running window per character — and
-    lf_distinct == 23 certifies it is a permutation; (3) the
-    INVERSE walks the LF orbit in O(log n) rounds, not n steps:
-    LF composes into 2/4/8/16-step jump tables and the orbit of
-    the original-rotation row unrolls with exact step positions
-    (P_{k+1} = P_k union jump(P_k) — the q555/q574 orbit idiom),
-    recovering the text REVERSED.  The roundtrip theorem rides
-    every row: text_resid == 0 and n_rec == 23 prove
-    inverse(bwt(T)) == T character-for-character, computed through
-    two genuinely different code paths.  The clusterability
-    theorem — WHY bzip2 exists — is emitted from the data:
-    runs_text == 22 collapses to runs_bwt == 9 on the repetitive
-    fixture (same multiset, 2.4x fewer runs for the RLE stage
-    downstream).  n_docs ties output to corpus size.
-
-    Round-5 engine restructure (the r4 verdict's #2): the 7
-    sequential localCheckpoints (11.5 s of driver latency at
-    sf0.1) are gone — tx is materialized once from the corpus
-    (loud 23-row bound), the rank refinement + LF mapping + orbit
-    walk run driver-side over that 23-row fixture mirroring the
-    oracle's spec stage-for-stage (the polygonize
-    small-label-graph pattern), and the roundtrip/runs/permutation
-    CERTIFICATES stay relational — computed by Spark joins over
-    the pinned bwt/lf/rec tables in the one final statement the
-    comparator audits."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q574_documents")
-    base = _q574_base("q574_documents")
-    pdf = spark.sql(f"WITH {base} SELECT * FROM tx").toPandas()
-    assert len(pdf) == _Q574_N, f"tx: {len(pdf)} rows"
-    code = {int(t.pos): int(t.code) for t in pdf.itertuples()}
-    local_df(spark, sorted(code.items()), "pos long, code long") \
-        .createOrReplaceTempView("q574_tx")
-    n = _Q574_N
-    r = dict(code)
-    for k in range(5):
-        sh = 1 << k
-        key = {p: r[p] * 32 + r[(p + sh) % n] for p in range(n)}
-        dr = {v: i for i, v in enumerate(sorted(set(key.values())))}
-        r = {p: dr[key[p]] for p in range(n)}
-    bwt = {r[p]: code[(p + n - 1) % n] for p in range(n)}
-    ccm = {a: sum(1 for b in bwt.values() if b < a)
-           for a in set(bwt.values())}
-    occ, lfm = {}, {}
-    for rw in sorted(bwt):
-        bc = bwt[rw]
-        occ[bc] = occ.get(bc, 0) + 1
-        lfm[rw] = ccm[bc] + occ[bc] - 1
-    orbit, cur = {}, r[0]
-    for k in range(32):
-        if cur not in orbit:
-            orbit[cur] = k
-        cur = lfm[cur]
-    rec = sorted((n - 1 - k, bwt[rw])
-                 for rw, k in orbit.items() if k < n)
-    local_df(spark, sorted(bwt.items()), "rw long, bc long") \
-        .createOrReplaceTempView("q574_bwt")
-    local_df(spark, sorted(lfm.items()), "rw long, toro long") \
-        .createOrReplaceTempView("q574_lf")
-    local_df(spark, rec, "pos long, rc long") \
-        .createOrReplaceTempView("q574_rec")
-    fin = (
-        "rr AS (SELECT\n"
-        "           CAST(sum(abs(t.code - r.rc)) AS BIGINT)"
-        " AS text_resid,\n"
-        "           CAST(count(*) AS BIGINT) AS n_rec\n"
-        "         FROM q574_tx t JOIN q574_rec r"
-        " ON r.pos = t.pos),\n"
-        "       rn AS (SELECT\n"
-        "           CAST((SELECT 1 + sum(CASE WHEN code <> pc"
-        " THEN 1 ELSE 0 END)\n"
-        "             FROM (SELECT code, lag(code) OVER (ORDER BY"
-        " pos) AS pc FROM q574_tx) q\n"
-        "             WHERE pc IS NOT NULL) AS BIGINT)"
-        " AS runs_text,\n"
-        "           CAST((SELECT 1 + sum(CASE WHEN bc <> pb"
-        " THEN 1 ELSE 0 END)\n"
-        "             FROM (SELECT bc, lag(bc) OVER (ORDER BY"
-        " rw) AS pb FROM q574_bwt) q\n"
-        "             WHERE pb IS NOT NULL) AS BIGINT)"
-        " AS runs_bwt,\n"
-        "           CAST((SELECT count(DISTINCT toro) FROM"
-        " q574_lf) AS BIGINT) AS lf_distinct),\n"
-        "       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        " FROM q574_documents)\n"
-        "       SELECT t.pos, t.code, r.rc AS rec_code,\n"
-        "              b.bc AS bwt_code,\n"
-        "              rr.text_resid, rr.n_rec,\n"
-        "              rn.runs_text, rn.runs_bwt,"
-        " rn.lf_distinct,\n"
-        "              ld.n_docs\n"
-        "       FROM q574_tx t\n"
-        "       JOIN q574_rec r ON r.pos = t.pos\n"
-        "       JOIN q574_bwt b ON b.rw = t.pos\n"
-        "       CROSS JOIN rr CROSS JOIN rn CROSS JOIN ld")
-    return spark.sql("WITH " + fin)
-
-
-_Q575_P = 1000003
-_Q575_POW = [pow(131, i, _Q575_P) for i in range(16)]
-_Q575_LV = 16
-
-
-def _q575_base(tbl: str, mat: str) -> str:
-    pw = " ".join(f"WHEN {i} THEN {w}"
-                  for i, w in enumerate(_Q575_POW))
-    return (
-        f"idx AS (SELECT DISTINCT doc_id % 16 AS i FROM {tbl}),\n"
-        f"       lf AS{mat} (SELECT d.doc_id,\n"
-        f"           CAST(sum(CAST(ascii(substr(d.text, x.i + 1,"
-        f" 1)) AS BIGINT)\n"
-        f"             * CASE x.i {pw} END) % {_Q575_P} AS BIGINT)"
-        f" AS h\n"
-        f"         FROM {tbl} d JOIN idx x\n"
-        f"           ON x.i < least(length(d.text), 16)\n"
-        f"         GROUP BY d.doc_id),\n"
-        f"       lv0 AS{mat} (SELECT CAST(row_number() OVER"
-        f" (ORDER BY doc_id) - 1 AS BIGINT) AS idx, h FROM lf),\n"
-        f"       tt AS{mat} (SELECT CAST(count(*) AS BIGINT) AS t\n"
-        f"         FROM {tbl} WHERE doc_id < 42)")
-
-
-def _q575_lvl(prev: str, divop: str) -> str:
-    return (
-        f"SELECT idx {divop} 2 AS idx,\n"
-        f"         CAST(CASE WHEN count(*) = 2\n"
-        f"           THEN (max(CASE WHEN idx % 2 = 0 THEN h END)"
-        f"*8191\n"
-        f"             + max(CASE WHEN idx % 2 = 1 THEN h END)"
-        f" + 7) % {_Q575_P}\n"
-        f"           ELSE max(h) END AS BIGINT) AS h\n"
-        f"       FROM {prev} GROUP BY idx {divop} 2")
-
-
-def _q575_fold(name: str, k: int, prev: str, lv: str,
-               divop: str) -> str:
-    nd = f"(tt.t {divop} {1 << k})"
-    return (
-        f"{name} AS (SELECT CAST(CASE WHEN s.h IS NULL THEN f.v\n"
-        f"           WHEN {nd} % 2 = 0\n"
-        f"             THEN (f.v*8191 + s.h + 7) % {_Q575_P}\n"
-        f"           ELSE (s.h*8191 + f.v + 7) % {_Q575_P}\n"
-        f"         END AS BIGINT) AS v\n"
-        f"         FROM {prev} f CROSS JOIN tt\n"
-        f"         LEFT JOIN {lv} s\n"
-        f"           ON s.idx = {nd} + 1 - 2*({nd} % 2))")
-
-
-def _q575_final(tbl: str, divop: str, mat: str,
-                pfx: str = "") -> str:
-    lvs = "\n         UNION ALL ".join(
-        f"SELECT {k} AS lvl, count(*) AS n_nodes FROM {pfx}lv{k}"
-        for k in range(_Q575_LV + 1))
-    sibs = "\n         UNION ALL ".join(
-        f"SELECT {k} AS lvl,"
-        f" (tt.t {divop} {1 << k}) AS node_idx,"
-        f" (tt.t {divop} {1 << k}) + 1"
-        f" - 2*((tt.t {divop} {1 << k}) % 2) AS sib_idx"
-        f" FROM tt" for k in range(_Q575_LV))
-    parts = [
-        f"f0 AS (SELECT l.h AS v FROM {pfx}lv0 l"
-        f" CROSS JOIN tt WHERE l.idx = tt.t)",
-        f"g0 AS (SELECT (l.h + 1) % {_Q575_P} AS v"
-        f" FROM {pfx}lv0 l CROSS JOIN tt WHERE l.idx = tt.t)"]
-    for k in range(_Q575_LV):
-        parts.append(_q575_fold(f"f{k + 1}", k, f"f{k}",
-                                f"{pfx}lv{k}", divop))
-        parts.append(_q575_fold(f"g{k + 1}", k, f"g{k}",
-                                f"{pfx}lv{k}", divop))
-    parts.append(
-        f"lvn AS{mat} ({lvs})")
-    parts.append(
-        f"sb AS{mat} ({sibs})")
-    parts.append(
-        f"gl AS{mat} (SELECT\n"
-        f"           CAST((SELECT h FROM {pfx}lv{_Q575_LV})"
-        f" AS BIGINT) AS root,\n"
-        f"           CAST((SELECT v FROM f{_Q575_LV}) AS BIGINT)"
-        f" AS proof_root,\n"
-        f"           CAST((SELECT v FROM g{_Q575_LV}) AS BIGINT)"
-        f" AS tamper_root,\n"
-        f"           CAST((SELECT count(*) FROM {pfx}lv0)"
-        f" AS BIGINT) AS n_leaves,\n"
-        f"           CAST((SELECT t FROM tt) AS BIGINT)"
-        f" AS target_idx)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(s.lvl AS BIGINT) AS lvl,\n"
-        f"              CAST(n.n_nodes AS BIGINT) AS n_nodes,\n"
-        f"              CAST(s.node_idx AS BIGINT) AS node_idx,\n"
-        f"              CAST(CASE WHEN sh.h IS NULL THEN -1\n"
-        f"                   ELSE s.sib_idx END AS BIGINT)"
-        f" AS sib_idx,\n"
-        f"              CAST(coalesce(sh.h, -1) AS BIGINT)"
-        f" AS sib_h,\n"
-        f"              g.root,\n"
-        f"              CAST(g.proof_root - g.root AS BIGINT)"
-        f" AS proof_resid,\n"
-        f"              g.tamper_root,\n"
-        f"              CAST(CASE WHEN g.tamper_root <> g.root\n"
-        f"                   THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS tamper_detected,\n"
-        f"              g.n_leaves, g.target_idx, ld.n_docs\n"
-        f"       FROM sb s\n"
-        f"       JOIN lvn n ON n.lvl = s.lvl\n"
-        f"       LEFT JOIN ({_q575_sibh(pfx)}) sh"
-        f" ON sh.lvl = s.lvl AND sh.idx = s.sib_idx\n"
-        f"       CROSS JOIN gl g CROSS JOIN ld")
-    return ",\n       ".join(parts)
-
-
-def _q575_sibh(pfx: str) -> str:
-    return "\n         UNION ALL ".join(
-        f"SELECT {k} AS lvl, idx, h FROM {pfx}lv{k}"
-        for k in range(_Q575_LV))
-
-
-def _q575_oracle(tbl: str = "documents") -> str:
-    parts = [_q575_base(tbl, " MATERIALIZED")]
-    for k in range(_Q575_LV):
-        parts.append(f"lv{k + 1} AS MATERIALIZED (\n"
-                     f"       {_q575_lvl(f'lv{k}', '//')})")
-    parts.append(_q575_final(tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q575_merkle_proofs", _q575_oracle())
-def q575(spark, sf_dir):
-    """Merkle tree with inclusion-proof verification and tamper
-    evidence (Merkle 1979 — the integrity structure under every
-    content-addressed store, certificate-transparency log, and
-    chunked-dataset manifest; the q557/q564 checksum family lifted
-    from streams to FORESTS).  Leaves are position-weighted
-    polynomial hashes of the real document texts (exact mod-p
-    integer arithmetic, inlined power table), ordered by doc_id;
-    16 halving levels pair children as (a*8191 + b + 7) mod p with
-    odd tails promoted — n <= 65536 leaves always reduce to one
-    root, and the level CTEs are idempotent past the top so ONE
-    fixed SQL text serves every SF (n_leaves and the level
-    populations scale with the corpus).  The inclusion proof for
-    the doc-42 leaf is the real O(log n) protocol, both halves
-    computed: the sibling path is extracted per level
-    (parity-ordered), the verification FOLD rebuilds the root from
-    leaf + siblings alone, and proof_resid == 0 certifies it
-    equals the independently-built tree root.  Tamper evidence is
-    the same fold run on leaf+1: tamper_detected == 1 (any
-    single-byte change to one document flips the root through 16
-    levels — and the fold IS the O(log n) incremental root update
-    a 100-TB manifest needs; no full rebuild).  Output: one row
-    per proof level with sibling indices/hashes (-1 where the odd
-    tail has no sibling — the promoted branch genuinely fires),
-    root and both fold results as globals."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q575_documents")
-    base = _q575_base("q575_documents", "")
-    for tv in ("lf", "lv0", "tt"):
-        df = spark.sql(f"WITH {base} SELECT * FROM {tv}") \
-            .localCheckpoint()
-        df.createOrReplaceTempView(f"q575_{tv}")
-    prev = "q575_lv0"
-    for k in range(_Q575_LV):
-        d = spark.sql(_q575_lvl(prev, "div")) \
-            .localCheckpoint(eager=False)
-        d.createOrReplaceTempView(f"q575_lv{k + 1}")
-        prev = f"q575_lv{k + 1}"
-    fin = _q575_final("q575_documents", "div", "", "q575_") \
-        .replace("CROSS JOIN tt", "CROSS JOIN q575_tt tt") \
-        .replace("FROM tt", "FROM q575_tt tt")
-    return spark.sql("WITH " + fin)
-
-
-# --- Consistent hashing + Johnson flowshop (q576-q577) ------------------------------------
-
-
-def _q576_mix(x: str, divop: str) -> str:
-    h1 = f"(({x}) * 2654435761) % 4294967296"
-    h2 = f"((({h1}) {divop} 65536 + ({h1})) % 4294967296)"
-    h3 = f"(({h2}) * 2057594037) % 4294967296"
-    return f"((({h3}) {divop} 4096) % 1048576)"
-
-
-def _q576_sql(tbl: str, divop: str, mat: str = "") -> str:
-    mixv = _q576_mix(f"i + 1000003", divop)
-    mixk = _q576_mix("doc_id", divop)
-    arc = "(v.p - k.p + 1048576) % 1048576"
-    return f"""WITH vn AS{mat} (SELECT i {divop} 32 AS node, i % 32 AS vid,
-                CAST({mixv} AS BIGINT) AS p
-              FROM (SELECT DISTINCT doc_id % 160 AS i
-                    FROM {tbl}) t),
-       ks AS{mat} (SELECT doc_id, CAST({mixk} AS BIGINT) AS p
-              FROM {tbl}),
-       oo AS{mat} (SELECT k.doc_id,
-                CAST(coalesce(min(CASE WHEN v.p >= k.p
-                       THEN v.p*8 + v.node END),
-                     min(v.p*8 + v.node)) % 8 AS BIGINT) AS own,
-                CAST(min(({arc})*8 + v.node) % 8 AS BIGINT)
-                  AS own2
-              FROM ks k CROSS JOIN vn v WHERE v.node < 4
-              GROUP BY k.doc_id, k.p),
-       nn AS{mat} (SELECT k.doc_id,
-                CAST(coalesce(min(CASE WHEN v.p >= k.p
-                       THEN v.p*8 + v.node END),
-                     min(v.p*8 + v.node)) % 8 AS BIGINT) AS own,
-                CAST(min(({arc})*8 + v.node) % 8 AS BIGINT)
-                  AS own2
-              FROM ks k CROSS JOIN vn v
-              GROUP BY k.doc_id, k.p),
-       mv AS{mat} (SELECT o.doc_id, o.own AS old_own,
-                n.own AS new_own,
-                CASE WHEN o.own <> n.own THEN 1 ELSE 0 END
-                  AS moved,
-                CASE WHEN o.own <> n.own AND n.own <> 4
-                     THEN 1 ELSE 0 END AS latmv,
-                CASE WHEN o.own <> o.own2 OR n.own <> n.own2
-                     THEN 1 ELSE 0 END AS deriv
-              FROM oo o JOIN nn n ON n.doc_id = o.doc_id),
-       gl AS{mat} (SELECT
-                CAST(sum(moved) AS BIGINT) AS n_moved,
-                CAST(sum(latmv) AS BIGINT) AS n_lateral,
-                CAST(sum(deriv) AS BIGINT) AS deriv_resid,
-                CAST(count(*) AS BIGINT) AS n_keys
-              FROM mv),
-       pc AS (SELECT CAST(160 - count(DISTINCT p) AS BIGINT)
-                AS n_pos_collisions FROM vn),
-       nd AS (SELECT n.node,
-                CAST(count(*) AS BIGINT) AS n_vnodes
-              FROM vn n GROUP BY n.node),
-       ko AS (SELECT old_own AS node,
-                CAST(count(*) AS BIGINT) AS keys_old
-              FROM mv GROUP BY old_own),
-       kn AS (SELECT new_own AS node,
-                CAST(count(*) AS BIGINT) AS keys_new
-              FROM mv GROUP BY new_own)
-       SELECT d.node, d.n_vnodes,
-              CAST(coalesce(o.keys_old, 0) AS BIGINT) AS keys_old,
-              CAST(coalesce(n.keys_new, 0) AS BIGINT) AS keys_new,
-              CAST(coalesce(n.keys_new, 0)
-                   - coalesce(o.keys_old, 0) AS BIGINT) AS delta,
-              g.n_moved, g.n_lateral, g.deriv_resid, g.n_keys,
-              p.n_pos_collisions
-       FROM nd d
-       LEFT JOIN ko o ON o.node = d.node
-       LEFT JOIN kn n ON n.node = d.node
-       CROSS JOIN gl g CROSS JOIN pc p"""
-
-
-@query("q576_consistent_hashing", _q576_sql("documents", "//",
-                                            " MATERIALIZED"))
-def q576(spark, sf_dir):
-    """Consistent hashing with virtual nodes (Karger et al. 1997 —
-    the shard router under every distributed cache, crawl-frontier
-    partitioner, and object store; q456 quorum / q490 DRF's
-    placement-layer sibling).  4 nodes x 32 vnodes hash onto a
-    2^20 ring via a two-round multiply-shift mix (second multiplier
-    2057594037 chosen so 2^32 * m < 2^63 — the ascii-overflow
-    lesson at hash width; every step exact BIGINT), every real doc
-    id hashes likewise, and ownership is clockwise-successor.  The
-    ownership rule is computed TWO ways per key and their agreement
-    emitted (deriv_resid == 0): the textbook form (first vnode at
-    position >= key, else global min — the wraparound special
-    case) and the uniform form (argmin of clockwise arc distance
-    (v - k + R) mod R, no special case) — the wrap bug every
-    hand-rolled ring implementation ships is provably absent.
-    Then node 4 JOINS the ring (+32 vnodes) and the minimal-
-    disruption theorem — the reason this structure exists — is
-    verified key-by-key: n_lateral == 0 (every key that moved,
-    moved TO the new node; old nodes never trade keys laterally,
-    so a rebalance invalidates no surviving cache entry), and
-    n_moved/n_keys lands near the 1/5 fair share (117/500 at
-    sf0.001; the residual skew of 32-vnode rings is emitted in the
-    per-node key counts, not hidden).  n_pos_collisions == 0
-    guards the fixture.  Per-node rows scale with the corpus;
-    ownership is one broadcast-dim aggregation per key — the
-    shuffle-free shard-assignment shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q576_documents")
-    return spark.sql(_q576_sql("q576_documents", "div"))
-
-
-def _q577_sql(tbl: str, mat: str = "") -> str:
-    a = "((j*j*5 + j*3 + 7) % 15 + 1)"
-    b = "((j*j*7 + j*11 + 3) % 15 + 1)"
-    kj = (f"(CASE WHEN {a} < {b} THEN 0 ELSE 1 END)*100000"
-          f" + (CASE WHEN {a} < {b} THEN {a} ELSE 99 - {b} END)"
-          f"*100 + j")
-    return f"""WITH jb AS (SELECT j, CAST({a} AS BIGINT) AS a,
-                CAST({b} AS BIGINT) AS b,
-                CAST({kj} AS BIGINT) AS kjon
-              FROM (SELECT DISTINCT doc_id % 12 AS j
-                    FROM {tbl}) t),
-       od AS (SELECT DISTINCT doc_id % 4 AS od FROM {tbl}),
-       seq AS{mat} (SELECT o.od, jb.j, jb.a, jb.b,
-                CAST(row_number() OVER (PARTITION BY o.od
-                  ORDER BY CASE o.od WHEN 0 THEN jb.kjon
-                    WHEN 1 THEN -jb.kjon
-                    WHEN 2 THEN jb.j
-                    ELSE (99 - jb.a)*100 + jb.j END) AS BIGINT)
-                  AS pos
-              FROM od o CROSS JOIN jb),
-       pre AS{mat} (SELECT od, pos, j, a, b,
-                CAST(sum(a) OVER (PARTITION BY od ORDER BY pos)
-                     AS BIGINT) AS ca,
-                CAST(sum(b) OVER (PARTITION BY od ORDER BY pos)
-                     AS BIGINT) AS sb
-              FROM seq),
-       c2 AS{mat} (SELECT od, pos, j, a, b, ca, sb,
-                CAST(sb + max(ca - sb + b)
-                     OVER (PARTITION BY od ORDER BY pos)
-                     AS BIGINT) AS c2
-              FROM pre),
-       rc AS{mat} (SELECT od,
-                CAST(sum(abs(c2 - (greatest(coalesce(pc2,
-                     CAST(0 AS BIGINT)), ca) + b))) AS BIGINT)
-                  AS rec_resid,
-                CAST(max(c2) AS BIGINT) AS makespan
-              FROM (SELECT od, ca, b, c2,
-                      lag(c2) OVER (PARTITION BY od ORDER BY pos)
-                        AS pc2
-                    FROM c2) q GROUP BY od),
-       lb AS{mat} (SELECT
-                CAST(greatest(sum(a) + min(b), sum(b) + min(a))
-                     AS BIGINT) AS bound FROM jb),
-       jm AS (SELECT makespan AS ms_j FROM rc WHERE od = 0),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(r.od AS BIGINT) AS od, r.makespan,
-              r.rec_resid, l.bound AS lower_bound,
-              CAST(r.makespan - l.bound AS BIGINT) AS gap_to_lb,
-              CAST(CASE WHEN j.ms_j <= r.makespan THEN 1 ELSE 0
-                   END AS BIGINT) AS johnson_no_worse,
-              CAST(CASE WHEN r.od = 0 AND r.makespan = l.bound
-                   THEN 1 ELSE 0 END AS BIGINT)
-                AS optimal_certified,
-              ld.n_docs
-       FROM rc r CROSS JOIN lb l CROSS JOIN jm j CROSS JOIN ld"""
-
-
-@query("q577_johnson_flowshop", _q577_sql("documents",
-                                          " MATERIALIZED"))
-def q577(spark, sf_dir):
-    """Johnson's two-machine flow-shop rule (Johnson 1954 — the
-    oldest exactly-solvable scheduling problem; the q493 critical
-    path / q444 pipeline-bubble family's optimality member: think
-    fetch-stage -> parse-stage pipelines over a crawl batch).  The
-    makespan recurrence C2_i = max(C2_{i-1}, C1_i) + b_i is
-    sequential, but it has an EXACT window closed form — C2_i =
-    SB_i + running_max(CA_k - SB_{k-1}) (the CUSUM/q560 move on a
-    max-plus recurrence) — so FOUR schedules evaluate in ONE plan
-    partitioned by an order dim: Johnson's rule (a<b jobs by a
-    asc, then the rest by b desc — packed into a single bigint
-    sort key), its exact reversal (-key), FIFO by job id, and
-    longest-first-on-machine-1 (the plausible-but-wrong heuristic).
-    The recurrence equivalence is re-derived per row from lag(C2)
-    and emitted as rec_resid == 0 on all 4 x 12 rows.  The
-    optimality story is COMPUTED, not cited: Johnson lands
-    makespan 102 == the machine lower bound max(sum_a + min_b,
-    sum_b + min_a) — optimal_certified == 1 is a PROOF of
-    optimality from the data itself, no enumeration needed — while
-    the adversarial orders cost 132/109/129 (johnson_no_worse == 1
-    on every row; the 30% spread is why the rule matters).  All
-    exact BIGINT; n_docs ties output to corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q577_documents")
-    return spark.sql(_q577_sql("q577_documents"))
-
-
-# --- GLCM texture features + seam carving (q578-q579) -------------------------------------
-
-
-def _q578_sql(tbl: str, divop: str, mat: str = "") -> str:
-    return f"""WITH img AS (SELECT i {divop} 12 AS r, i % 12 AS c,
-                CAST(CASE WHEN i % 12 < 6
-                     THEN (i {divop} 12 + i % 12) {divop} 3
-                     ELSE CASE WHEN (i {divop} 12 + i % 12) % 2
-                          = 0 THEN 0 ELSE 7 END
-                END AS BIGINT) AS gray,
-                CASE WHEN i % 12 < 6 THEN 0 ELSE 1 END AS reg
-              FROM (SELECT DISTINCT doc_id % 144 AS i
-                    FROM {tbl}) t),
-       offs AS (SELECT * FROM (VALUES (0, 0, 1), (1, 1, 0),
-                (2, 1, 1)) t(oid, dr, dc)),
-       glcm AS{mat} (SELECT a.reg, o.oid,
-                a.gray AS gi, b.gray AS gj,
-                CAST(count(*) AS BIGINT) AS v
-              FROM img a CROSS JOIN offs o
-              JOIN img b ON b.r = a.r + o.dr
-                AND b.c = a.c + o.dc AND b.reg = a.reg
-              GROUP BY a.reg, o.oid, a.gray, b.gray),
-       feat AS{mat} (SELECT reg, oid,
-                CAST(sum(v) AS BIGINT) AS n_pairs,
-                CAST(sum((gi - gj)*(gi - gj)*v) AS BIGINT)
-                  AS contrast,
-                CAST(sum(v*v) AS BIGINT) AS energy,
-                CAST(sum(v * (408850 {divop}
-                     (1 + (gi - gj)*(gi - gj)))) AS BIGINT)
-                  AS homog_scaled
-              FROM glcm GROUP BY reg, oid),
-       asym AS{mat} (SELECT g.reg, g.oid,
-                CAST(sum(abs(g.v - coalesce(t.v, 0))) AS BIGINT)
-                  AS asym2
-              FROM glcm g LEFT JOIN glcm t
-                ON t.reg = g.reg AND t.oid = g.oid
-                AND t.gi = g.gj AND t.gj = g.gi
-              GROUP BY g.reg, g.oid),
-       mg AS{mat} (SELECT reg, oid, gi,
-                CAST(sum(v) AS BIGINT) AS m
-              FROM glcm GROUP BY reg, oid, gi),
-       ind AS{mat} (SELECT a.reg, o.oid, a.gray AS gi,
-                CAST(count(*) AS BIGINT) AS cnt
-              FROM img a CROSS JOIN offs o
-              WHERE a.r + o.dr <= 11 AND a.c + o.dc <= 11
-                AND (a.reg = 1 OR a.c + o.dc <= 5)
-              GROUP BY a.reg, o.oid, a.gray),
-       mr AS{mat} (SELECT m.reg, m.oid,
-                CAST(sum(abs(m.m - coalesce(i.cnt, 0)))
-                     AS BIGINT) AS marg_resid
-              FROM mg m LEFT JOIN ind i ON i.reg = m.reg
-                AND i.oid = m.oid AND i.gi = m.gi
-              GROUP BY m.reg, m.oid),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(f.reg AS BIGINT) AS reg,
-              CAST(f.oid AS BIGINT) AS oid,
-              f.n_pairs, f.contrast, f.energy, f.homog_scaled,
-              a.asym2, m.marg_resid, ld.n_docs
-       FROM feat f
-       JOIN asym a ON a.reg = f.reg AND a.oid = f.oid
-       JOIN mr m ON m.reg = f.reg AND m.oid = f.oid
-       CROSS JOIN ld"""
-
-
-@query("q578_glcm_haralick", _q578_sql("documents", "//",
-                                       " MATERIALIZED"))
-def q578(spark, sf_dir):
-    """Gray-level co-occurrence texture features (Haralick 1973 —
-    THE classical remote-sensing texture descriptor; the reference's
-    raster stats family q38/q88 measures distributions, GLCM
-    measures SPATIAL structure, which is what separates pavement
-    from forest at the same mean brightness).  The co-occurrence
-    matrix is ONE offset-dim join per region (8 gray levels, 3
-    offsets), and the three features stay EXACT integers: contrast
-    = sum (i-j)^2 v, energy = sum v^2, and homogeneity's 1/(1+d^2)
-    weights cleared by the design-time LCM 408850 (the dyadic-
-    weights lesson applied to harmonic weights).  The fixture is
-    maximally discriminative and every number tells: the smooth
-    gradient region scores contrast 20-37 while the checkerboard
-    scores 2940-3234 (147x — the separation GLCM exists to
-    provide), the checkerboard's DIAGONAL offset collapses to
-    contrast 0 / homogeneity max (parity (r+c) mod 2 is invariant
-    along (1,1) — a planted structural surprise the features
-    correctly detect), and asym2 > 0 only on the gradient (texture
-    DIRECTIONALITY: the checkerboard is symmetric under i<->j,
-    the gradient is not).  The marginal-consistency theorem is
-    verified from genuinely independent derivations: row sums of
-    the pair-join GLCM against a pure GEOMETRY predicate count
-    (no join) — marg_resid == 0 on all 6 (region, offset) rows.
-    Scale: one join + aggregations; the GLCM is at most 64 rows
-    per (region, offset) regardless of raster size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q578_documents")
-    return spark.sql(_q578_sql("q578_documents", "div"))
-
-
-_Q579_PATH = [3, 3, 3, 3, 4, 5, 6, 6, 6, 6]
-
-
-def _ckpt_view(spark, sql: str, name: str):
-    """localCheckpoint + re-alias every column (toDF mints fresh
-    exprIds).  Without the re-alias, sibling checkpointed views
-    share attribute ids with their source view (localCheckpoint
-    preserves output attributes), and a later UNION of siblings
-    equi-joined or scalar-subqueried against another sibling trips
-    a Catalyst internal error (NoSuchElementException: key not
-    found: r#10L) during optimization — hit by q579's seam walk."""
-    df = spark.sql(sql)
-    df.localCheckpoint().toDF(*df.columns) \
-        .createOrReplaceTempView(name)
-
-
-def _q579_base(tbl: str, divop: str) -> str:
-    pc = " ".join(f"WHEN {r} THEN {c}"
-                  for r, c in enumerate(_Q579_PATH))
-    return (
-        f"en AS (SELECT i {divop} 12 AS r, i % 12 AS c,\n"
-        f"         CAST(CASE WHEN i % 12 = CASE i {divop} 12"
-        f" {pc} END\n"
-        f"              THEN (i {divop} 12) % 3\n"
-        f"              ELSE ((i {divop} 12)*13 + (i % 12)*29\n"
-        f"                + (i {divop} 12)*(i % 12)*5 + 17) % 37"
-        f" + 20\n"
-        f"         END AS BIGINT) AS e\n"
-        f"         FROM (SELECT DISTINCT doc_id % 120 AS i"
-        f" FROM {tbl}) t),\n"
-        f"       d0 AS (SELECT r, c, e, e AS cum FROM en"
-        f" WHERE r = 0)")
-
-
-def _q579_dp(r: int, prev: str) -> str:
-    return (
-        f"SELECT g.r, g.c, g.e, g.e + min(p.cum) AS cum\n"
-        f"       FROM en g JOIN {prev} p ON abs(p.c - g.c) <= 1\n"
-        f"       WHERE g.r = {r}\n"
-        f"       GROUP BY g.r, g.c, g.e")
-
-
-def _q579_walk(r: int, prev: str, dp: str, divop: str) -> str:
-    return (
-        f"SELECT w.r, w.c, w.cum, d2.e\n"
-        f"       FROM (SELECT d.r,\n"
-        f"           CAST(min(d.cum*16 + d.c) % 16 AS BIGINT)"
-        f" AS c,\n"
-        f"           CAST(min(d.cum*16 + d.c) {divop} 16"
-        f" AS BIGINT) AS cum\n"
-        f"         FROM {dp} d JOIN {prev} s"
-        f" ON abs(d.c - s.c) <= 1\n"
-        f"         GROUP BY d.r) w\n"
-        f"       JOIN {dp} d2 ON d2.r = w.r AND d2.c = w.c")
-
-
-def _q579_final(tbl: str, mat: str, pfx: str = "") -> str:
-    sm = "\n         UNION ALL ".join(
-        f"SELECT r, c, cum, e FROM {pfx}s{r}" for r in range(10))
-    return (
-        f"sv AS{mat} ({sm}),\n"
-        f"       gl AS{mat} (SELECT\n"
-        f"           CAST(sum(v.e) AS BIGINT) AS seam_cost,\n"
-        f"           CAST((SELECT min(cum) FROM {pfx}d9)"
-        f" AS BIGINT) AS dp_min,\n"
-        f"           CAST(sum(v.e) - (SELECT min(cum)"
-        f" FROM {pfx}d9) AS BIGINT) AS cost_resid,\n"
-        f"           CAST(sum(CASE WHEN v.pc IS NOT NULL\n"
-        f"                AND abs(v.c - v.pc) > 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_invalid_steps,\n"
-        f"           CAST(sum(CASE WHEN v.pc IS NOT NULL\n"
-        f"                AND v.c <> v.pc THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_diag_moves,\n"
-        f"           CAST(sum(CASE WHEN v.pcum IS NOT NULL\n"
-        f"                AND v.cum <> v.pcum + v.e THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS step_resid\n"
-        f"         FROM (SELECT r, c, e, cum,\n"
-        f"                 lag(c) OVER (ORDER BY r) AS pc,\n"
-        f"                 lag(cum) OVER (ORDER BY r) AS pcum\n"
-        f"               FROM sv) v),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(v.r AS BIGINT) AS r,\n"
-        f"              CAST(v.c AS BIGINT) AS seam_c,\n"
-        f"              v.e, v.cum,\n"
-        f"              g.seam_cost, g.dp_min, g.cost_resid,\n"
-        f"              g.step_resid, g.n_invalid_steps,\n"
-        f"              g.n_diag_moves, ld.n_docs\n"
-        f"       FROM sv v CROSS JOIN gl g CROSS JOIN ld")
-
-
-def _q579_seed(dp: str, divop: str, mat: str) -> str:
-    return (
-        f"s9 AS{mat} (SELECT w.r, w.c, w.cum, d2.e\n"
-        f"       FROM (SELECT CAST(9 AS BIGINT) AS r,\n"
-        f"           CAST(min(cum*16 + c) % 16 AS BIGINT) AS c,\n"
-        f"           CAST(min(cum*16 + c) {divop} 16 AS BIGINT)"
-        f" AS cum\n"
-        f"         FROM {dp}) w\n"
-        f"       JOIN {dp} d2 ON d2.r = w.r AND d2.c = w.c)"
-        .replace(f"s9 AS{mat}", f"s9 AS{mat}", 1))
-
-
-def _q579_oracle(tbl: str = "documents") -> str:
-    parts = [_q579_base(tbl, "//")]
-    for r in range(1, 10):
-        parts.append(f"d{r} AS MATERIALIZED (\n"
-                     f"       {_q579_dp(r, f'd{r - 1}')})")
-    parts.append(_q579_seed("d9", "//", " MATERIALIZED"))
-    for r in range(8, -1, -1):
-        parts.append(f"s{r} AS MATERIALIZED (\n"
-                     f"       {_q579_walk(r, f's{r + 1}', f'd{r}', '//')})")
-    parts.append(_q579_final(tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q579_seam_carving", _q579_oracle())
-def q579(spark, sf_dir):
-    """Seam carving: minimum-energy vertical seam (Avidan & Shamir
-    2007 — content-aware raster retargeting; the q517/q555
-    least-cost machinery specialized to the row-DAG where each
-    pixel reaches only its three lower neighbors, which is what
-    makes the DP exact in H stages instead of a Jacobi fixpoint).
-    The DP unrolls row-synchronously (stage r = one 3-neighbor
-    join against stage r-1; engine localCheckpoints each stage,
-    oracle runs the IDENTICAL stage text MATERIALIZED), then the
-    seam EXTRACTS top-down in 9 walk stages with the tie rule
-    packed (min(cum*16 + c) — lowest cost, then leftmost column,
-    the q517 idiom).  The 12x10 fixture plants a low-energy
-    corridor that ZIGZAGS (cols 3->4->5->6) through 20-56 noise;
-    the DP finds it and the answer certifies itself four ways:
-    cost_resid == 0 telescopes the sum of raw energies along the
-    emitted seam to the DP's bottom-row minimum (conservation —
-    the seam really costs what the field claims), step_resid == 0
-    re-derives cum_r == cum_{r-1} + e per seam row,
-    n_invalid_steps == 0 proves 8-connectivity (|dc| <= 1 on
-    every step), and n_diag_moves == 3 proves the diagonal
-    branch genuinely fired (the corridor's drift).  Per-row seam
-    output plus globals; exact BIGINT throughout."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q579_documents")
-    base = _q579_base("q579_documents", "div")
-    for tv in ("en", "d0"):
-        _ckpt_view(spark, f"WITH {base} SELECT * FROM {tv}",
-                   f"q579_{tv}")
-    prev = "q579_d0"
-    for r in range(1, 10):
-        _ckpt_view(spark, _q579_dp(r, prev)
-                   .replace("FROM en g", "FROM q579_en g"),
-                   f"q579_d{r}")
-        prev = f"q579_d{r}"
-    _ckpt_view(spark, "WITH " + _q579_seed("q579_d9", "div", "")
-               + " SELECT * FROM s9", "q579_s9")
-    for r in range(8, -1, -1):
-        _ckpt_view(spark, _q579_walk(r, f"q579_s{r + 1}",
-                                     f"q579_d{r}", "div"),
-                   f"q579_s{r}")
-    fin = _q579_final("q579_documents", "", "q579_")
-    return spark.sql("WITH " + fin)
-
-
-# --- Aho-Corasick matching + longest common substring (q580-q581) -------------------------
-
-
-_Q580_PATS = ["part", "art", "t", "scan", "an", "row"]
-_Q580_NODES = sorted({p[:k] for p in _Q580_PATS
-                      for k in range(1, len(p) + 1)})
-_Q580_NID = {s: i + 1 for i, s in enumerate(_Q580_NODES)}
-
-
-def _q580_sql(tbl: str, mat: str = "") -> str:
-    nd = ", ".join(f"({_Q580_NID[s]}, '{s}', {len(s)})"
-                   for s in _Q580_NODES)
-    pd = ", ".join(f"({i}, '{p}', {len(p)})"
-                   for i, p in enumerate(_Q580_PATS))
-    sfx = ", ".join(
-        f"({_Q580_NID[s]}, {pi})" for s in _Q580_NODES
-        for pi, p in enumerate(_Q580_PATS) if s.endswith(p))
-    return f"""WITH nd AS (SELECT * FROM (VALUES {nd}) t(nid, s, len)),
-       pd AS (SELECT * FROM (VALUES {pd}) t(pid, p, plen)),
-       sfx AS (SELECT * FROM (VALUES {sfx}) t(nid, pid)),
-       pos AS (SELECT a.i*24 + b.j + 1 AS i
-              FROM (SELECT DISTINCT doc_id % 25 AS i FROM {tbl}) a
-              CROSS JOIN (SELECT DISTINCT doc_id % 24 AS j
-                          FROM {tbl}) b),
-       tx AS (SELECT doc_id, lower(text) AS t,
-                     length(text) AS n FROM {tbl}),
-       st AS{mat} (SELECT d.doc_id, x.i,
-                CAST(coalesce(max(CASE WHEN n.len <= x.i
-                     AND substr(d.t, x.i - n.len + 1, n.len) = n.s
-                     THEN n.len*32 + n.nid END) % 32, 0)
-                     AS BIGINT) AS nid
-              FROM tx d JOIN pos x ON x.i <= d.n
-              CROSS JOIN nd n
-              GROUP BY d.doc_id, x.i),
-       ca AS{mat} (SELECT f.pid, CAST(count(*) AS BIGINT) AS c
-              FROM st s JOIN sfx f ON f.nid = s.nid
-              GROUP BY f.pid),
-       cb AS{mat} (SELECT p.pid, CAST(count(*) AS BIGINT) AS c
-              FROM tx d JOIN pos x ON x.i <= d.n
-              CROSS JOIN pd p
-              WHERE p.plen <= x.i
-                AND substr(d.t, x.i - p.plen + 1, p.plen) = p.p
-              GROUP BY p.pid),
-       fl AS{mat} (SELECT a.nid,
-                CAST(coalesce(max(CASE WHEN b.len < a.len
-                     AND substr(a.s, a.len - b.len + 1, b.len)
-                         = b.s
-                     THEN b.len*32 + b.nid END) % 32, 0)
-                     AS BIGINT) AS fnid
-              FROM nd a CROSS JOIN nd b
-              GROUP BY a.nid, a.s, a.len),
-       ch0 AS{mat} (SELECT nid, nid AS anc FROM nd
-              UNION SELECT nid, fnid FROM fl WHERE fnid > 0),
-       ch1 AS{mat} (SELECT DISTINCT x.nid, y.anc FROM ch0 x
-              JOIN ch0 y ON y.nid = x.anc),
-       ch2 AS{mat} (SELECT DISTINCT x.nid, y.anc FROM ch1 x
-              JOIN ch1 y ON y.nid = x.anc),
-       cc AS{mat} (SELECT p.pid, CAST(count(*) AS BIGINT) AS c
-              FROM st s
-              JOIN ch2 h ON h.nid = s.nid
-              JOIN nd n2 ON n2.nid = h.anc
-              JOIN pd p ON p.p = n2.s
-              GROUP BY p.pid),
-       fck AS (SELECT CAST(sum(nid*32 + fnid) AS BIGINT)
-                AS fail_checksum FROM fl),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT p.pid, p.p AS pattern,
-              CAST(coalesce(b.c, 0) AS BIGINT) AS n_matches,
-              CAST(coalesce(a.c, 0) - coalesce(b.c, 0) AS BIGINT)
-                AS state_resid,
-              CAST(coalesce(h.c, 0) - coalesce(b.c, 0) AS BIGINT)
-                AS failchain_resid,
-              f.fail_checksum, ld.n_docs
-       FROM pd p
-       LEFT JOIN ca a ON a.pid = p.pid
-       LEFT JOIN cb b ON b.pid = p.pid
-       LEFT JOIN cc h ON h.pid = p.pid
-       CROSS JOIN fck f CROSS JOIN ld"""
-
-
-@query("q580_aho_corasick", _q580_sql("documents",
-                                      " MATERIALIZED"))
-def q580(spark, sf_dir):
-    """Aho-Corasick multi-pattern matching (Aho & Corasick 1975 —
-    the automaton under every keyword filter, profanity screen, and
-    PII scrubber a crawl pipeline runs; q166's contamination
-    screen generalized from fixed n-grams to a pattern TRIE).  The
-    sequential automaton scan is replaced by its defining
-    invariant, which is join-computable per position: the AC state
-    after reading position i IS the longest suffix of text[..i]
-    that is a trie node (one 16-node broadcast join + packed
-    argmax per position — root 0 when none).  Matches are then
-    derived THREE independent ways over the real document texts
-    and their agreement emitted per pattern: (A) patterns that are
-    suffixes of the state's string (a design-inlined suffix dim —
-    AC's output function), (B) the naive substring-equality join
-    (ground truth), and (C) the fail-link chain: fail(v) — the
-    longest proper suffix of v in the trie — is computed
-    RELATIONALLY from the node dim (argmax suffix join, packed),
-    closed under 2 pointer-doublings, and walked to collect
-    pattern nodes.  state_resid == 0 and failchain_resid == 0 on
-    all 6 patterns are the AC correctness theorem (state + output
-    = all pattern occurrences) computed, not cited.  The pattern
-    set is chosen so the machinery genuinely fires on this corpus:
-    'part' -> 'art' -> 't' is a live 3-deep fail chain (every
-    'part' hit also reports 'art' and 't'), fail('scan') = 'an'
-    crosses pattern families, and counts scale with the corpus
-    (1806 'at'-family hits at sf0.001).  fail_checksum pins the
-    computed fail table.  Scale: one broadcast dim join per
-    position — embarrassingly parallel over documents."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q580_documents")
-    return spark.sql(_q580_sql("q580_documents"))
-
-
-_Q581_A = "sortmergejoinbatch"
-_Q581_B = "hashmergejoinscan"
-_Q581_S = _Q581_A + "#" + _Q581_B + "$"
-_Q581_N = len(_Q581_S)
-_Q581_CODE = {c: i for i, c in
-              enumerate(sorted(set(_Q581_S)))}
-
-
-def _q581_base(tbl: str) -> str:
-    cs = " ".join(f"WHEN {i} THEN {_Q581_CODE[ch]}"
-                  for i, ch in enumerate(_Q581_S))
-    return (
-        f"tx AS (SELECT i AS pos,\n"
-        f"           CAST(CASE i {cs} END AS BIGINT) AS code\n"
-        f"         FROM (SELECT DISTINCT doc_id % {_Q581_N} AS i"
-        f" FROM {tbl}) t),\n"
-        f"       rk0 AS (SELECT pos, code AS r FROM tx)")
-
-
-def _q581_rank(prev: str, shift: int) -> str:
-    return (
-        f"SELECT a.pos,\n"
-        f"         CAST(dense_rank() OVER (ORDER BY a.r*64 + b.r)"
-        f" - 1 AS BIGINT) AS r\n"
-        f"       FROM {prev} a JOIN {prev} b\n"
-        f"         ON b.pos = (a.pos + {shift}) % {_Q581_N}")
-
-
-def _q581_lift(k: int, prev: str, rk: str) -> str:
-    n = _Q581_N
-    return (
-        f"SELECT p.i, p.j, p.rnk,\n"
-        f"         p.acc + CASE WHEN x.r = y.r THEN {1 << k}"
-        f" ELSE 0 END AS acc\n"
-        f"       FROM {prev} p\n"
-        f"       JOIN {rk} x ON x.pos = (p.i + p.acc) % {n}\n"
-        f"       JOIN {rk} y ON y.pos = (p.j + p.acc) % {n}")
-
-
-def _q581_final(lF: str, tbl: str, mat: str) -> str:
-    la, lb = len(_Q581_A), len(_Q581_B)
-    a, b = _Q581_A, _Q581_B
-    return (
-        f"mx AS{mat} (SELECT CAST(max(acc) AS BIGINT) AS lcs,\n"
-        f"           CAST(min(CASE WHEN acc = (SELECT max(acc)"
-        f" FROM {lF})\n"
-        f"             THEN least(i, j)*64 + greatest(i, j) END)"
-        f" AS BIGINT) AS arg\n"
-        f"         FROM {lF}),\n"
-        f"       ia AS (SELECT CAST(arg // 64 AS BIGINT) AS pa,\n"
-        f"              CAST(arg % 64 - {la + 1} AS BIGINT) AS pb,"
-        f" lcs FROM mx),\n"
-        f"       ex AS{mat} (SELECT\n"
-        f"           CAST(max(m.l) AS BIGINT) AS exhaustive_max\n"
-        f"         FROM (SELECT i.pos AS i, j.pos AS j,\n"
-        f"             max(CASE WHEN l.ln <= {la} - i.pos\n"
-        f"               AND l.ln <= {lb} - j.pos\n"
-        f"               AND substr('{a}', i.pos + 1, l.ln)\n"
-        f"                 = substr('{b}', j.pos + 1, l.ln)\n"
-        f"               THEN l.ln ELSE 0 END) AS l\n"
-        f"           FROM (SELECT DISTINCT doc_id % {la} AS pos"
-        f" FROM {tbl}) i\n"
-        f"           CROSS JOIN (SELECT DISTINCT doc_id % {lb}"
-        f" AS pos FROM {tbl}) j\n"
-        f"           CROSS JOIN (SELECT DISTINCT doc_id % {la}"
-        f" + 1 AS ln FROM {tbl}) l\n"
-        f"           GROUP BY i.pos, j.pos) m),\n"
-        f"       cert AS{mat} (SELECT x.lcs, x.pa, x.pb,\n"
-        f"           CASE WHEN substr('{a}', x.pa + 1,"
-        f" x.lcs)\n"
-        f"             = substr('{b}', x.pb + 1, x.lcs)"
-        f" THEN 1 ELSE 0 END AS exist_ok\n"
-        f"         FROM ia x),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT p.i, p.j, CAST(p.acc AS BIGINT) AS lcp,\n"
-        f"              p.rnk,\n"
-        f"              c.lcs, c.pa, c.pb,\n"
-        f"              substr('{a}', c.pa + 1, c.lcs)"
-        f" AS substring,\n"
-        f"              CAST(c.exist_ok AS BIGINT) AS exist_ok,\n"
-        f"              e.exhaustive_max,\n"
-        f"              CAST(c.lcs - e.exhaustive_max AS BIGINT)"
-        f" AS method_resid,\n"
-        f"              ld.n_docs\n"
-        f"       FROM {lF} p\n"
-        f"       CROSS JOIN cert c CROSS JOIN ex e CROSS JOIN ld")
-
-
-def _q581_pairs(rF: str) -> str:
-    n, la = _Q581_N, len(_Q581_A)
-    return (
-        f"SELECT a.pos AS i, b.pos AS j, a.r AS rnk,\n"
-        f"         CAST(0 AS BIGINT) AS acc\n"
-        f"       FROM {rF} a JOIN {rF} b ON b.r = a.r + 1\n"
-        f"       WHERE a.pos NOT IN ({la}, {n - 1})\n"
-        f"         AND b.pos NOT IN ({la}, {n - 1})\n"
-        f"         AND (a.pos < {la}) <> (b.pos < {la})")
-
-
-def _q581_oracle(tbl: str = "documents") -> str:
-    parts = [_q581_base(tbl)]
-    prev = "rk0"
-    for k in range(6):
-        parts.append(f"rk{k + 1} AS MATERIALIZED (\n"
-                     f"       {_q581_rank(prev, 1 << k)})")
-        prev = f"rk{k + 1}"
-    parts.append(f"p6 AS MATERIALIZED (\n"
-                 f"       {_q581_pairs(prev)})")
-    pp = "p6"
-    for k in range(5, -1, -1):
-        parts.append(f"p{k} AS MATERIALIZED (\n"
-                     f"       {_q581_lift(k, pp, f'rk{k}')})")
-        pp = f"p{k}"
-    parts.append(_q581_final(pp, tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q581_longest_common_substring", _q581_oracle())
-def q581(spark, sf_dir):
-    """Longest common substring via generalized suffix ranking +
-    binary-lifted LCP (Gusfield ch. 7 — the near-duplicate
-    PASSAGE detector: q18/q19 find near-dup documents, this finds
-    the exact shared span two documents plagiarize; also the core
-    of dedup-aware compression).  Three pointer-doubling machines
-    again, zero per-character loops: (1) the two strings join with
-    unique sentinels (# between, $ terminal — the terminal makes
-    cyclic rotation sort equal suffix sort) and rank-refine through
-    6 prefix-doubling stages, KEEPING every intermediate rank
-    table; (2) adjacent suffix-array entries from DIFFERENT
-    documents form the candidate pairs (the classical theorem that
-    the max cross-document LCP is attained on SA-adjacent pairs);
-    (3) each pair's LCP is computed by BINARY LIFTING down the
-    saved rank tables — 6 stages of acc += 2^k when the 2^k-block
-    ranks agree, O(log n) joins instead of character walks (the
-    unique sentinels guarantee cyclic block-equality can never
-    overshoot the true LCP).  The answer certifies itself from a
-    GENUINELY independent path: an exhaustive positions x positions
-    x lengths substring-equality scan recomputes the maximum
-    (method_resid == 0 — suffix machinery vs brute force, exists
-    at L and none longer), and exist_ok == 1 re-checks the claimed
-    (pa, pb, L) by direct substring comparison, with the matched
-    text ('mergejoin', L = 9, amid decoy shared fragments)
-    emitted.  The argmax carries the packed tie rule min(i*64+j).
-    Engine localCheckpoints every rank/lift stage (each referenced
-    2-3x); oracle the IDENTICAL stage text MATERIALIZED."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q581_documents")
-    base = _q581_base("q581_documents")
-    for tv in ("tx", "rk0"):
-        _ckpt_view(spark, f"WITH {base} SELECT * FROM {tv}",
-                   f"q581_{tv}")
-    prev = "q581_rk0"
-    for k in range(6):
-        _ckpt_view(spark, _q581_rank(prev, 1 << k),
-                   f"q581_rk{k + 1}")
-        prev = f"q581_rk{k + 1}"
-    _ckpt_view(spark, _q581_pairs(prev), "q581_p6")
-    pp = "q581_p6"
-    for k in range(5, -1, -1):
-        _ckpt_view(spark, _q581_lift(k, pp, f"q581_rk{k}"),
-                   f"q581_p{k}")
-        pp = f"q581_p{k}"
-    fin = _q581_final(pp, "q581_documents", "") \
-        .replace("// 64", "div 64")
-    return spark.sql("WITH " + fin)
-
-
-# --- OR-set CRDT + FM-index backward search (q582-q583) -----------------------------------
-
-
-_Q582_OPS = [
-    # (oid, replica, seq, kind 0=add/1=rm, elem X0 Y1 Z2 W3 V4)
-    (0, 0, 1, 0, 0), (1, 0, 2, 0, 1), (2, 1, 1, 0, 2),
-    (3, 2, 1, 0, 3), (4, 1, 2, 1, 2), (5, 1, 3, 0, 2),
-    (6, 0, 3, 0, 0), (7, 1, 4, 1, 0), (8, 1, 5, 1, 1),
-    (9, 2, 2, 0, 4), (10, 0, 4, 1, 4),
-]
-_Q582_SYNC = [(1, 4, 0, 2), (1, 5, 0, 2), (0, 4, 2, 0)]
-_Q582_FR = (
-    [(0, 0, 0, 99), (0, 0, 1, 1), (0, 0, 2, 2),
-     (1, 1, 0, 2), (1, 1, 1, 99), (1, 1, 2, 0)]
-    + [(2 + v, v, r, 99) for v in range(3) for r in range(3)])
-
-
-def _q582_sql(tbl: str, mat: str = "") -> str:
-    ops = ", ".join(f"({o}, {r}, {s}, {k}, {e})"
-                    for o, r, s, k, e in _Q582_OPS)
-    syn = ", ".join(f"({a}, {b}, {c}, {d})"
-                    for a, b, c, d in _Q582_SYNC)
-    fr = ", ".join(f"({f}, {v}, {r}, {u})"
-                   for f, v, r, u in _Q582_FR)
-    return f"""WITH ops AS (SELECT * FROM (VALUES {ops})
-              t(oid, rep, seq, kind, elem)),
-       syn AS (SELECT * FROM (VALUES {syn})
-              t(robs, atseq, rsrc, upto)),
-       fr AS (SELECT * FROM (VALUES {fr})
-              t(fid, viewer, rsrc, upto)),
-       ad AS (SELECT * FROM ops WHERE kind = 0),
-       rm AS (SELECT * FROM ops WHERE kind = 1),
-       vis AS{mat} (SELECT r.oid AS rid, a.oid AS aid, a.elem,
-                max(CASE WHEN a.rep = r.rep AND a.seq < r.seq
-                     THEN 1
-                     WHEN y.upto IS NOT NULL AND a.seq <= y.upto
-                     THEN 1 ELSE 0 END) AS v
-              FROM rm r JOIN ad a ON a.elem = r.elem
-              LEFT JOIN syn y ON y.robs = r.rep
-                AND y.rsrc = a.rep AND y.atseq <= r.seq
-              GROUP BY r.oid, a.oid, a.elem),
-       surv AS{mat} (SELECT a.oid AS aid, a.elem, a.rep, a.seq
-              FROM ad a
-              WHERE NOT EXISTS (SELECT 1 FROM vis v
-                WHERE v.aid = a.oid AND v.v = 1)),
-       ra AS{mat} (SELECT DISTINCT g.fid, g.viewer, a.oid,
-                a.elem
-              FROM fr g JOIN ad a ON a.rep = g.rsrc
-                AND (a.rep = g.viewer OR a.seq <= g.upto)),
-       rr AS{mat} (SELECT DISTINCT g.fid, r.oid
-              FROM fr g JOIN rm r ON r.rep = g.rsrc
-                AND (r.rep = g.viewer OR r.seq <= g.upto)),
-       vw AS{mat} (SELECT a.fid, a.elem,
-                CAST(count(*) AS BIGINT) AS n_tags,
-                CAST(sum(a.oid) AS BIGINT) AS tag_sum
-              FROM ra a
-              WHERE NOT EXISTS (SELECT 1 FROM rr r
-                JOIN vis v ON v.rid = r.oid AND v.aid = a.oid
-                  AND v.v = 1
-                WHERE r.fid = a.fid)
-              GROUP BY a.fid, a.elem),
-       conv AS{mat} (SELECT
-                CAST(sum(CASE WHEN coalesce(a.n_tags, -1)
-                     <> coalesce(b.n_tags, -1)
-                     OR coalesce(a.tag_sum, -1)
-                     <> coalesce(b.tag_sum, -1)
-                     THEN 1 ELSE 0 END) AS BIGINT) AS post_diff
-              FROM (SELECT e.elem, f.fid FROM
-                     (SELECT DISTINCT elem FROM ad) e
-                     CROSS JOIN (SELECT DISTINCT fid FROM fr
-                                 WHERE fid >= 2) f) g
-              LEFT JOIN vw a ON a.fid = g.fid AND a.elem = g.elem
-              LEFT JOIN vw b ON b.fid = 2 AND b.elem = g.elem),
-       prediff AS (SELECT
-                CAST(count(*) AS BIGINT) AS pre_elem_diff
-              FROM (SELECT elem FROM vw WHERE fid = 0
-                    UNION SELECT elem FROM vw WHERE fid = 1) u
-              WHERE NOT EXISTS (SELECT 1 FROM vw x
-                  WHERE x.fid = 0 AND x.elem = u.elem)
-                 OR NOT EXISTS (SELECT 1 FROM vw y
-                  WHERE y.fid = 1 AND y.elem = u.elem)),
-       els AS (SELECT DISTINCT elem FROM ad),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(e.elem AS BIGINT) AS elem,
-              CAST(CASE WHEN s.n IS NOT NULL THEN 1 ELSE 0 END
-                   AS BIGINT) AS present_final,
-              CAST(coalesce(s.n, 0) AS BIGINT) AS n_tags_final,
-              CAST(coalesce(s.ts, -1) AS BIGINT) AS tag_sum,
-              CAST(CASE WHEN p0.elem IS NOT NULL THEN 1 ELSE 0
-                   END AS BIGINT) AS present_pre_r0,
-              CAST(CASE WHEN p1.elem IS NOT NULL THEN 1 ELSE 0
-                   END AS BIGINT) AS present_pre_r1,
-              c.post_diff, pd.pre_elem_diff, ld.n_docs
-       FROM els e
-       LEFT JOIN (SELECT elem, CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum(aid) AS BIGINT) AS ts
-                  FROM surv GROUP BY elem) s ON s.elem = e.elem
-       LEFT JOIN (SELECT elem FROM vw WHERE fid = 0) p0
-         ON p0.elem = e.elem
-       LEFT JOIN (SELECT elem FROM vw WHERE fid = 1) p1
-         ON p1.elem = e.elem
-       CROSS JOIN conv c CROSS JOIN prediff pd CROSS JOIN ld"""
-
-
-@query("q582_orset_crdt", _q582_sql("documents", " MATERIALIZED"))
-def q582(spark, sf_dir):
-    """Observed-remove set CRDT (Shapiro et al. 2011 — the
-    conflict-free replicated SET under every collaborative store
-    and multi-region cache; q568's vector-clock machinery put to
-    its canonical use).  An 11-op, 3-replica execution with
-    explicit causal knowledge: a remove deletes exactly the add
-    TAGS visible at its issue point (visibility = own prior ops +
-    sync-prefix dim, computed as one LEFT JOIN aggregation — the
-    q446 no-correlated-LUT rule).  Every OR-set semantic branch is
-    planted and its verdict computed: ADD-WINS concurrency —
-    element X's old tag is removed but its concurrent re-add
-    (invisible to the remover) SURVIVES (present_final == 1 with
-    tag_sum naming exactly the concurrent tag); causal remove —
-    Y's remover saw Y's only tag, Y is gone; remove-then-re-add —
-    Z returns with only the fresh tag; BLIND remove — V's remover
-    had synced nothing from V's replica, so the remove is a no-op
-    and V survives (the branch that distinguishes OR-set from
-    last-writer-wins); W untouched.  Eventual consistency is
-    EMITTED as a before/after pair: two pre-sync replica frontiers
-    genuinely diverge (pre_elem_diff == 4 elements differ between
-    r0's and r1's views) while the three fully-synced views agree
-    tag-for-tag (post_diff == 0 across all elements x replicas —
-    convergence verified on tag multisets, not just membership).
-    All frontier evaluation reuses the SAME visibility relation,
-    so the convergence check is the CRDT merge theorem over this
-    execution, not a tautology.  n_docs ties output to corpus
-    size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q582_documents")
-    return spark.sql(_q582_sql("q582_documents"))
-
-
-_Q583_PATS = ["abra", "cad", "ra", "dab", "bb", "a"]
-
-
-def _q583_post(rF: str, tbl: str, mat: str) -> str:
-    n = _Q574_N
-    pd = ", ".join(f"({i}, '{p}', {len(p)})"
-                   for i, p in enumerate(_Q583_PATS))
-    pch = ", ".join(
-        f"({i}, {t}, {_Q574_CODE[p[len(p) - 1 - t]]})"
-        for i, p in enumerate(_Q583_PATS)
-        for t in range(len(p)))
-    parts = [
-        f"bwt AS{mat} (SELECT r.r AS rw, t.code AS bc\n"
-        f"         FROM {rF} r JOIN tx t\n"
-        f"           ON t.pos = (r.pos + {n - 1}) % {n})",
-        f"cc AS{mat} (SELECT a.bc,\n"
-        f"           CAST(sum(CASE WHEN b.bc < a.bc THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS c\n"
-        f"         FROM (SELECT DISTINCT bc FROM bwt) a\n"
-        f"         CROSS JOIN bwt b GROUP BY a.bc)",
-        f"bnd AS (SELECT DISTINCT doc_id % 24 AS i FROM {tbl})",
-        f"occ AS{mat} (SELECT a.bc AS ch, b.i,\n"
-        f"           CAST(sum(CASE WHEN w.rw < b.i THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS v\n"
-        f"         FROM (SELECT DISTINCT bc FROM bwt) a\n"
-        f"         CROSS JOIN bnd b\n"
-        f"         LEFT JOIN bwt w ON w.bc = a.bc\n"
-        f"         GROUP BY a.bc, b.i)",
-        f"pd AS (SELECT * FROM (VALUES {pd}) t(pid, pstr, plen))",
-        f"pch AS (SELECT * FROM (VALUES {pch})"
-        f" t(pid, step, code))",
-        f"iv0 AS (SELECT pid, plen, CAST(0 AS BIGINT) AS lo,\n"
-        f"           CAST({n} AS BIGINT) AS hi FROM pd)"]
-    prev = "iv0"
-    for t in range(4):
-        parts.append(
-            f"iv{t + 1} AS{mat} (SELECT p.pid, p.plen,\n"
-            f"           CAST(CASE WHEN {t} < p.plen\n"
-            f"             THEN c.c + ol.v ELSE p.lo END"
-            f" AS BIGINT) AS lo,\n"
-            f"           CAST(CASE WHEN {t} < p.plen\n"
-            f"             THEN c.c + oh.v ELSE p.hi END"
-            f" AS BIGINT) AS hi\n"
-            f"         FROM {prev} p\n"
-            f"         LEFT JOIN pch h ON h.pid = p.pid"
-            f" AND h.step = {t}\n"
-            f"         LEFT JOIN cc c ON c.bc = h.code\n"
-            f"         LEFT JOIN occ ol ON ol.ch = h.code"
-            f" AND ol.i = p.lo\n"
-            f"         LEFT JOIN occ oh ON oh.ch = h.code"
-            f" AND oh.i = p.hi)")
-        prev = f"iv{t + 1}"
-    parts.append(
-        f"loc AS{mat} (SELECT v.pid,\n"
-        f"           CAST(coalesce(sum(r.pos + 1), 0) AS BIGINT)"
-        f" AS fm_possum\n"
-        f"         FROM {prev} v\n"
-        f"         LEFT JOIN {rF} r ON r.r >= v.lo"
-        f" AND r.r < v.hi\n"
-        f"         GROUP BY v.pid)")
-    parts.append(
-        f"pos AS (SELECT DISTINCT doc_id % {n} AS i"
-        f" FROM {tbl})")
-    parts.append(
-        f"nv AS{mat} (SELECT p.pid,\n"
-        f"           CAST(count(x.i) AS BIGINT) AS naive_count,\n"
-        f"           CAST(coalesce(sum(x.i + 1), 0) AS BIGINT)"
-        f" AS naive_possum\n"
-        f"         FROM pd p LEFT JOIN pos x\n"
-        f"           ON substr('{_Q574_S}', x.i + 1, p.plen)"
-        f" = p.pstr\n"
-        f"         GROUP BY p.pid)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT p.pid, p.pstr AS pattern,\n"
-        f"              CAST(p.plen AS BIGINT) AS plen,\n"
-        f"              v.lo, v.hi,\n"
-        f"              CAST(v.hi - v.lo AS BIGINT) AS fm_count,\n"
-        f"              n2.naive_count,\n"
-        f"              CAST(v.hi - v.lo - n2.naive_count"
-        f" AS BIGINT) AS count_resid,\n"
-        f"              l.fm_possum, n2.naive_possum,\n"
-        f"              CAST(l.fm_possum - n2.naive_possum"
-        f" AS BIGINT) AS pos_resid,\n"
-        f"              ld.n_docs\n"
-        f"       FROM pd p\n"
-        f"       JOIN {prev} v ON v.pid = p.pid\n"
-        f"       JOIN loc l ON l.pid = p.pid\n"
-        f"       JOIN nv n2 ON n2.pid = p.pid\n"
-        f"       CROSS JOIN ld")
-    return ",\n       ".join(parts)
-
-
-def _q583_oracle(tbl: str = "documents") -> str:
-    parts = [_q574_base(tbl)]
-    prev = "r0"
-    for k in range(5):
-        parts.append(f"rk{k + 1} AS MATERIALIZED (\n"
-                     f"       {_q574_rank(prev, 1 << k)})")
-        prev = f"rk{k + 1}"
-    parts.append(_q583_post(prev, tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q583_fm_index_search", _q583_oracle())
-def q583(spark, sf_dir):
-    """FM-index backward search with locate (Ferragina & Manzini
-    2000 — the compressed-self-index query engine built ON q574's
-    BWT: count and locate every occurrence of a pattern touching
-    only the transform, never the text; what every modern
-    sequence/search stack runs underneath).  The machinery is
-    q574's suffix ranking (5 prefix-doubling stages), then pure
-    lookups: the C table (counting join) and a full occ grid
-    (character x boundary running counts — one LEFT JOIN
-    aggregation, 144 rows) make each backward step lo' = C[c] +
-    occ(c, lo), hi' = C[c] + occ(c, hi) a two-lookup join; ALL SIX
-    patterns advance through the same 4 unrolled stages (shorter
-    patterns freeze early via the step guard), and LOCATE inverts
-    the final interval through the rank table (SA row -> text
-    position).  Verification is against the text itself: per
-    pattern, fm_count == naive substring count AND the located
-    positions agree as position-weighted sums (count_resid ==
-    pos_resid == 0) — the FM-index invariants computed end-to-end
-    rather than assumed.  The pattern set exercises every regime:
-    nested repeats ('abra' x4, 'ra' x4, 'a' x10 — the high-
-    multiplicity interval), mid-string spans ('cad', 'dab' across
-    the repeat boundary), and 'bb' whose interval EMPTIES mid-
-    search and stays provably empty through the remaining stages
-    (the monotone-interval property, lo >= hi preserved by rank
-    monotonicity).  Engine localCheckpoints every stage via
-    _ckpt_view; oracle the IDENTICAL stage text MATERIALIZED."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q583_documents")
-    base = _q574_base("q583_documents")
-    for tv in ("tx", "r0"):
-        _ckpt_view(spark, f"WITH {base} SELECT * FROM {tv}",
-                   f"q583_{tv}")
-    prev = "q583_r0"
-    for k in range(5):
-        _ckpt_view(spark, _q574_rank(prev, 1 << k),
-                   f"q583_rk{k + 1}")
-        prev = f"q583_rk{k + 1}"
-    post = _q583_post(prev, "q583_documents", "") \
-        .replace("JOIN tx t", "JOIN q583_tx t")
-    return spark.sql("WITH " + post)
-
-
-# --- HyperLogLog + Golomb-Rice coding (q584-q585) -----------------------------------------
-
-
-def _q584_sql(tbl: str, divop: str, mat: str = "") -> str:
-    p2 = ", ".join(f"({e}, {1 << e})" for e in range(30))
-    return f"""WITH p2 AS (SELECT * FROM (VALUES {p2}) t(e, v)),
-       hx AS{mat} (SELECT doc_id,
-                CAST((((((doc_id + 98765) * 2654435761)
-                  % 4294967296) {divop} 65536
-                  + (((doc_id + 98765) * 2654435761)
-                  % 4294967296)) % 4294967296) AS BIGINT) AS h2
-              FROM {tbl}),
-       hx2 AS{mat} (SELECT doc_id,
-                CAST((((h2 * 2057594037) % 4294967296)
-                  {divop} 32768
-                  + ((h2 * 2057594037) % 4294967296))
-                  % 4294967296 AS BIGINT) AS h
-              FROM hx),
-       rho AS{mat} (SELECT x.doc_id, x.h % 16 AS j,
-                x.doc_id % 2 AS half,
-                CAST(29 - coalesce(max(p.e) + 1, 0) AS BIGINT)
-                  AS rho
-              FROM hx2 x LEFT JOIN p2 p
-                ON p.v <= x.h {divop} 16
-              GROUP BY x.doc_id, x.h, x.doc_id % 2),
-       sc AS (SELECT DISTINCT doc_id % 2 AS s FROM {tbl}),
-       mem AS{mat} (SELECT c.s AS scope, r.doc_id, r.j, r.half,
-                r.rho
-              FROM rho r CROSS JOIN sc c
-              WHERE c.s = 0 OR r.doc_id % 97 = 0),
-       bk AS (SELECT DISTINCT doc_id % 16 AS j FROM {tbl}),
-       rg AS{mat} (SELECT c.s AS scope, b.j,
-                CAST(coalesce(max(m.rho), 0) AS BIGINT) AS reg,
-                CAST(coalesce(max(CASE WHEN m.half = 0
-                     THEN m.rho END), 0) AS BIGINT) AS reg_h0,
-                CAST(coalesce(max(CASE WHEN m.half = 1
-                     THEN m.rho END), 0) AS BIGINT) AS reg_h1
-              FROM sc c CROSS JOIN bk b
-              LEFT JOIN mem m ON m.scope = c.s AND m.j = b.j
-              GROUP BY c.s, b.j),
-       ag AS{mat} (SELECT r.scope,
-                CAST(sum(536870912 {divop} p.v) AS BIGINT) AS s,
-                CAST(sum(CASE WHEN r.reg = 0 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS v_zero,
-                CAST(sum(abs(r.reg - greatest(r.reg_h0,
-                     r.reg_h1))) AS BIGINT) AS merge_resid
-              FROM rg r JOIN p2 p ON p.e = r.reg
-              GROUP BY r.scope),
-       tv AS{mat} (SELECT c.s AS scope,
-                CAST(count(DISTINCT d.doc_id) AS BIGINT)
-                  AS true_distinct
-              FROM sc c JOIN {tbl} d
-                ON c.s = 0 OR d.doc_id % 97 = 0
-              GROUP BY c.s),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(r.scope AS BIGINT) AS scope,
-              CAST(r.j AS BIGINT) AS j,
-              r.reg, r.reg_h0, r.reg_h1,
-              a.s, a.v_zero, a.merge_resid,
-              (673e-3 * 137438953472e0) / a.s AS est,
-              CAST(CASE WHEN (673e-3 * 137438953472e0) / a.s
-                   < 40e0 THEN 1 ELSE 0 END AS BIGINT)
-                AS linear_branch,
-              t.true_distinct, ld.n_docs
-       FROM rg r
-       JOIN ag a ON a.scope = r.scope
-       JOIN tv t ON t.scope = r.scope
-       CROSS JOIN ld"""
-
-
-@query("q584_hyperloglog", _q584_sql("documents", "//",
-                                     " MATERIALIZED"))
-def q584(spark, sf_dir):
-    """HyperLogLog REGISTER-LEVEL theorems (Flajolet et al. 2007
-    — the fixed-θ kin of q496's theta sketch).  q279 deploys an
-    HLL estimate and q311 maintains one in Structured Streaming;
-    this query opens the registers and proves what those assume:
-    exact integer harmonic parts, register-wise-max mergeability,
-    and the small-range branch actually firing.  Everything except the final estimate is EXACT BIGINT:
-    the 32-bit multiply-fold mix stays under 2^63 by construction
-    (the overflow lesson), rho = leading-zero rank of the 28-bit
-    window computed by a power-dim join (no log), registers are
-    per-bucket MAXes — and max is what makes HLL the distributed
-    counter: mergeability is PROVEN, not cited, by sketching the
-    two corpus halves separately and checking register-wise max
-    reassembles every one of the 16 registers (merge_resid == 0).
-    The harmonic-mean denominator S = 2^29 * sum 2^-M_j is an
-    exact integer (power-dim division); only the final alpha*m^2/S
-    is a float, written as ONE fixed-order expression with
-    e-notation literals (673e-3 — the q534 DECIMAL-literal
-    lesson).  TWO sketches run through the same plan: the full
-    corpus (est within the 1.04/sqrt(16) = 26% theory band:
-    406/500 and 5286/5000) and a 97th-doc subset that drives the
-    SMALL-RANGE branch — at sf0.001 it leaves 10 of 16 registers
-    empty and the linear-counting condition est < 2.5m genuinely
-    fires (linear_branch == 1 with v_zero emitted — the branch
-    flag computed from data, dead on the full corpus and alive on
-    the subset).  true_distinct rides along for the honest error.
-    One row per (scope, register): the full sketch state is the
-    output, 32 rows regardless of corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q584_documents")
-    return spark.sql(_q584_sql("q584_documents", "div"))
-
-
-def _q585_sql(tbl: str, divop: str, mat: str = "") -> str:
-    kd = ", ".join(f"({k}, {1 << k})" for k in range(9))
-    p2 = ", ".join(f"({e}, {1 << e})" for e in range(21))
-    return f"""WITH s AS (SELECT doc_id % 8 AS term, doc_id AS x FROM {tbl}),
-       gp AS{mat} (SELECT term, x,
-                CAST(x - lag(x, 1, CAST(-1 AS BIGINT))
-                     OVER (PARTITION BY term ORDER BY x)
-                     AS BIGINT) AS gap
-              FROM s),
-       kd AS (SELECT * FROM (VALUES {kd}) t(k, pw)),
-       p2 AS (SELECT * FROM (VALUES {p2}) t(e, v)),
-       bits AS{mat} (SELECT g.term, k.k,
-                CAST(sum(g.gap {divop} k.pw + 1 + k.k) AS BIGINT)
-                  AS bits
-              FROM gp g CROSS JOIN kd k GROUP BY g.term, k.k),
-       best AS{mat} (SELECT term,
-                CAST(min(bits*16 + k) % 16 AS BIGINT) AS kstar,
-                CAST(min(bits*16 + k) {divop} 16 AS BIGINT)
-                  AS rice_bits
-              FROM bits GROUP BY term),
-       lopt AS{mat} (SELECT b.term,
-                CAST(CASE WHEN (lo.bits IS NULL
-                       OR b.rice_bits <= lo.bits)
-                     AND (hi.bits IS NULL
-                       OR b.rice_bits <= hi.bits)
-                     THEN 1 ELSE 0 END AS BIGINT) AS local_opt
-              FROM best b
-              LEFT JOIN bits lo ON lo.term = b.term
-                AND lo.k = b.kstar - 1
-              LEFT JOIN bits hi ON hi.term = b.term
-                AND hi.k = b.kstar + 1),
-       rt AS{mat} (SELECT g.term,
-                CAST(sum(abs((g.gap {divop} k.pw)*k.pw
-                     + g.gap % k.pw - g.gap)) AS BIGINT)
-                  AS roundtrip_resid
-              FROM gp g
-              JOIN best b ON b.term = g.term
-              JOIN kd k ON k.k = b.kstar
-              GROUP BY g.term),
-       tn AS (SELECT term, CAST(count(*) AS BIGINT) AS n,
-                CAST(max(x) AS BIGINT) AS mx FROM s
-              GROUP BY term),
-       un AS (SELECT CAST(max(x) + 1 AS BIGINT) AS uni FROM s),
-       ef AS{mat} (SELECT t.term, t.n,
-                CAST(max(p.e) AS BIGINT) AS l,
-                CAST(t.n * max(p.e) + t.n
-                     + t.mx {divop} max(p.v) + 1 AS BIGINT)
-                  AS ef_bits
-              FROM tn t CROSS JOIN un u
-              JOIN p2 p ON p.v * t.n <= u.uni
-              GROUP BY t.term, t.n, t.mx),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT b.term, e.n, b.kstar, b.rice_bits,
-              l.local_opt, r.roundtrip_resid,
-              e.ef_bits,
-              CAST(b.rice_bits - e.ef_bits AS BIGINT)
-                AS rice_minus_ef,
-              ld.n_docs
-       FROM best b
-       JOIN lopt l ON l.term = b.term
-       JOIN rt r ON r.term = b.term
-       JOIN ef e ON e.term = b.term
-       CROSS JOIN ld"""
-
-
-@query("q585_golomb_rice", _q585_sql("documents", "//",
-                                     " MATERIALIZED"))
-def q585(spark, sf_dir):
-    """Golomb-Rice gap coding with optimal-parameter selection
-    (Golomb 1966 / Rice 1979 — the OTHER classical posting-list
-    code, q572 Elias-Fano's unary-quotient cousin; also the
-    residual coder inside FLAC/shorten and the reference's
-    lossless-predictor kin).  Per term, the sorted real doc-id
-    list becomes gaps (window lag, first gap anchored at -1), and
-    for EVERY candidate parameter k in 0..8 the total cost
-    sum(gap >> k) + 1 + k bits evaluates in one cross-join
-    aggregation; the winner is argmin with the tie rule packed
-    (min(bits*16 + k) — smallest size, then smallest k).  Three
-    certificates ride each term row: local_opt == 1 (the chosen k
-    beats both neighbors k+-1 — the unimodality every Rice
-    parameter estimator relies on, checked not assumed),
-    roundtrip_resid == 0 (quotient*2^k + remainder reassembles
-    every gap exactly — the decode identity), and the head-to-head
-    against q572's quasi-succinct bound: ef_bits recomputed inline
-    with the same power-dim idiom, rice_minus_ef emitted per term
-    (on these near-uniform gaps the two codes land within a few
-    dozen bits — the reader sees WHY engines pick either).  All
-    exact BIGINT; lists and universe scale with the corpus."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q585_documents")
-    return spark.sql(_q585_sql("q585_documents", "div"))
-
-
-# --- Bloom filter + LRU stack distances (q586-q587) ---------------------------------------
-
-
-_Q586_MIX = (
-    "(((((({x} + 98765) * 2654435761) % 4294967296) {d} 65536"
-    " + ((({x} + 98765) * 2654435761) % 4294967296))"
-    " % 4294967296))")
-
-
-def _q586_sql(tbl: str, divop: str, mat: str = "") -> str:
-    p2 = ", ".join(f"({e}, {1 << e})" for e in range(25))
-    return f"""WITH p2 AS (SELECT * FROM (VALUES {p2}) t(e, v)),
-       hx AS{mat} (SELECT doc_id, doc_id % 3 AS cls,
-                doc_id % 2 AS half, doc_id % 4 AS grp,
-                CAST({_Q586_MIX.format(x='doc_id', d=divop)}
-                     AS BIGINT) AS h2
-              FROM {tbl}),
-       hx2 AS{mat} (SELECT doc_id, cls, half, grp,
-                CAST((((h2 * 2057594037) % 4294967296)
-                  {divop} 32768
-                  + ((h2 * 2057594037) % 4294967296))
-                  % 4294967296 AS BIGINT) AS h
-              FROM hx),
-       mm AS (SELECT CAST(min(p.v) AS BIGINT) AS m
-              FROM p2 p CROSS JOIN
-                (SELECT count(*) AS ni FROM hx2 WHERE cls = 0) n
-              WHERE p.v >= 6 * n.ni),
-       kp AS{mat} (SELECT x.doc_id, x.cls, x.half, x.grp, b.pos
-              FROM hx2 x CROSS JOIN mm
-              CROSS JOIN (SELECT 0 AS sl UNION ALL SELECT 1
-                          UNION ALL SELECT 2) s
-              CROSS JOIN LATERAL (SELECT CASE s.sl
-                  WHEN 0 THEN x.h % mm.m
-                  WHEN 1 THEN (x.h {divop} 512) % mm.m
-                  ELSE (x.h {divop} 262144) % mm.m END
-                AS pos) b),
-       bits AS{mat} (SELECT DISTINCT pos FROM kp WHERE cls = 0),
-       bh AS{mat} (SELECT half, pos FROM kp WHERE cls = 0
-              GROUP BY half, pos),
-       mrg AS (SELECT CAST(count(*) AS BIGINT) AS merge_resid
-              FROM (SELECT pos FROM (SELECT DISTINCT pos FROM bh)
-                    u EXCEPT SELECT pos FROM bits) q),
-       tst AS{mat} (SELECT k.doc_id, k.cls, k.grp,
-                CAST(CASE WHEN count(DISTINCT k.pos)
-                     = count(DISTINCT b.pos) THEN 1 ELSE 0 END
-                     AS BIGINT) AS allset
-              FROM kp k LEFT JOIN bits b ON b.pos = k.pos
-              GROUP BY k.doc_id, k.cls, k.grp),
-       gl AS{mat} (SELECT
-                CAST((SELECT count(*) FROM hx2 WHERE cls = 0)
-                     AS BIGINT) AS n_ins,
-                CAST((SELECT count(*) FROM tst WHERE cls = 0
-                      AND allset = 0) AS BIGINT) AS fn_count,
-                CAST((SELECT count(*) FROM bits) AS BIGINT)
-                  AS n_bits_set,
-                CAST((SELECT m FROM mm) AS BIGINT) AS m_bits),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(t.grp AS BIGINT) AS probe_grp,
-              CAST(count(*) AS BIGINT) AS n_probes,
-              CAST(sum(t.allset) AS BIGINT) AS n_false_pos,
-              max(g.n_ins) AS n_ins,
-              max(g.fn_count) AS fn_count,
-              max(g.n_bits_set) AS n_bits_set,
-              max(g.m_bits) AS m_bits,
-              max(r.merge_resid) AS merge_resid,
-              max(ld.n_docs) AS n_docs
-       FROM tst t CROSS JOIN gl g CROSS JOIN mrg r CROSS JOIN ld
-       WHERE t.cls = 1
-       GROUP BY t.grp"""
-
-
-@query("q586_bloom_filter", _q586_sql("documents", "//",
-                                      " MATERIALIZED"))
-def q586(spark, sf_dir):
-    """Bloom filter (Bloom 1970 — the membership gate in front of
-    every LSM read path, crawl-frontier dedup, and cache; the
-    set-membership member of the q563/q569/q584 sketch family).
-    k = 3 positions per key from one overflow-safe multiply-fold
-    mix, filter size CHOSEN FROM THE DATA (smallest power of two
-    >= 6x the insert count via the power dim — so the load factor,
-    and hence the FP regime, survives the 10x SF step instead of
-    saturating); inserts are docs with id % 3 == 0, probes the
-    DISJOINT id % 3 == 1 class.  The three defining properties are
-    measured, never cited: NO FALSE NEGATIVES — every inserted key
-    re-probes all-bits-set (fn_count == 0, the one guarantee a
-    Bloom filter actually makes); false positives EXIST and are
-    counted per probe group (n_false_pos > 0 at every SF — the
-    price of 6 bits/key, emitted not estimated; membership uses
-    count(DISTINCT matched) == count(DISTINCT own) so colliding
-    slices of one key can't fake a hit); and UNION-mergeability —
-    the half-corpus filters OR together into exactly the full
-    filter (merge_resid == 0 as a set EXCEPT, the property that
-    makes Bloom filters shippable as shuffle-free partials).
-    n_bits_set / m_bits is the honest occupancy.  Scale: build is
-    one distinct-aggregation, probe is one broadcast join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q586_documents")
-    return spark.sql(_q586_sql("q586_documents", "div"))
-
-
-_Q587_CAPS = [1, 2, 4, 8, 16, 32, 64]
-
-
-def _q587_trace(tbl: str, divop: str) -> str:
-    return (
-        f"tr AS (SELECT CAST(row_number() OVER (ORDER BY doc_id)"
-        f" AS BIGINT) AS pos,\n"
-        f"           CAST(CASE WHEN doc_id % 8 < 2"
-        f" THEN doc_id % 3\n"
-        f"                WHEN doc_id % 8 < 4\n"
-        f"                THEN 10 + (doc_id {divop} 8) % 5\n"
-        f"                WHEN doc_id % 8 < 6\n"
-        f"                THEN 20 + (doc_id {divop} 4) % 24\n"
-        f"                ELSE 100 + (doc_id*7) % 160\n"
-        f"           END AS BIGINT) AS item\n"
-        f"         FROM {tbl})")
-
-
-def _q587_stack(mat: str) -> str:
-    caps = ", ".join(f"({c})" for c in _Q587_CAPS)
-    return (
-        f"pv AS{mat} (SELECT pos, item,\n"
-        f"           lag(pos) OVER (PARTITION BY item"
-        f" ORDER BY pos) AS ppos\n"
-        f"         FROM tr),\n"
-        f"       sd AS{mat} (SELECT a.pos,\n"
-        f"           CAST(count(DISTINCT x.item) AS BIGINT) AS d\n"
-        f"         FROM pv a LEFT JOIN tr x\n"
-        f"           ON x.pos > a.ppos AND x.pos < a.pos\n"
-        f"         WHERE a.ppos IS NOT NULL\n"
-        f"         GROUP BY a.pos),\n"
-        f"       caps AS (SELECT * FROM (VALUES {caps}) t(c)),\n"
-        f"       hs AS{mat} (SELECT c.c,\n"
-        f"           CAST(sum(CASE WHEN s.d < c.c THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS hits_stack\n"
-        f"         FROM caps c CROSS JOIN sd s GROUP BY c.c),\n"
-        f"       st AS (SELECT\n"
-        f"           CAST((SELECT count(*) FROM tr) AS BIGINT)"
-        f" AS n_acc,\n"
-        f"           CAST((SELECT count(*) FROM pv WHERE ppos"
-        f" IS NULL) AS BIGINT) AS n_cold)")
-
-
-def _q587_out(hits_sim: str, tbl: str) -> str:
-    return (
-        f"SELECT h.c, h.hits_stack,\n"
-        f"              {hits_sim} AS hits_sim,\n"
-        f"              {hits_sim} - h.hits_stack AS sim_resid,\n"
-        f"              CAST(CASE WHEN lag(h.hits_stack)"
-        f" OVER (ORDER BY h.c) IS NULL\n"
-        f"                   OR h.hits_stack >= lag(h.hits_stack)"
-        f" OVER (ORDER BY h.c)\n"
-        f"                   THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS monotone_ok,\n"
-        f"              s.n_acc, s.n_cold,\n"
-        f"              ld.n_docs\n"
-        f"       FROM hs h CROSS JOIN st s\n"
-        f"       CROSS JOIN (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl}) ld")
-
-
-def _q587_oracle(tbl: str = "documents") -> str:
-    return ("WITH " + _q587_trace(tbl, "//") + ",\n       "
-            + _q587_stack(" MATERIALIZED") + "\n       "
-            + _q587_out("CAST(h.hits_stack AS BIGINT)", tbl))
-
-
-@query("q587_lru_stack_distance", _q587_oracle())
-def q587(spark, sf_dir):
-    """LRU stack distances — every cache size in one pass (Mattson
-    et al. 1970; the capacity-planning math under every CDN, page
-    cache, and KV tier: 'what hit rate would we get at 2x the
-    memory?' answered without re-running the trace).  The access
-    trace derives from the real doc ids with four planted locality
-    scales (3 scorching items, 5 hot, 24 warm, a 160-item cold
-    tail with genuine re-references), and the stack distance of
-    each access — the number of DISTINCT items since the previous
-    touch of the same item — is one window (previous position) +
-    one range join (distinct count in the gap).  Mattson's
-    INCLUSION theorem says LRU(C) hits exactly the accesses with
-    stack distance < C, for ALL C simultaneously; here the theorem
-    IS the driver comparison: the engine's hits_sim column is a
-    real applyInPandas LRU simulation (an OrderedDict cache
-    evicting true-LRU at each of the 7 capacities) while the
-    oracle fills the same column from the relational stack
-    distances — any divergence between the sequential simulator
-    and the one-pass formula breaks the audit.  sim_resid == 0 is
-    additionally emitted engine-side (both derivations in one
-    plan), monotone_ok == 1 certifies the inclusion property
-    (hit curves never decrease in capacity: 125/125/125/187/248/
-    306/440 at sf0.001 — the staircase exposes the three locality
-    scales), and n_cold counts compulsory misses.  Scale: the
-    range join is bounded by reuse distance, so hot items cost
-    O(1) and only the cold tail pays — the classical trade."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q587_documents")
-    _ckpt_view(spark, "WITH " + _q587_trace("q587_documents",
-                                            "div")
-               + " SELECT * FROM tr", "q587_tr")
-    stack = _q587_stack("").replace("FROM tr", "FROM q587_tr") \
-        .replace("JOIN tr x", "JOIN q587_tr x")
-    nd = _t(spark, sf_dir, "documents").count()
-    caps = list(_Q587_CAPS)
-
-    def sim(key, g):
-        import pandas as pd
-        from collections import OrderedDict
-        g = g.sort_values("pos")
-        rows = []
-        for c in caps:
-            cache = OrderedDict()
-            hits = 0
-            for it in g["item"]:
-                if it in cache:
-                    hits += 1
-                    cache.move_to_end(it)
-                else:
-                    cache[it] = 1
-                    if len(cache) > c:
-                        cache.popitem(last=False)
-            rows.append((c, hits))
-        return pd.DataFrame(rows, columns=["c", "hits_sim"])
-
-    import pyspark.sql.functions as F
-    tr = spark.table("q587_tr").withColumn("g", F.lit(0))
-    simdf = tr.groupBy("g").applyInPandas(
-        sim, "c long, hits_sim long").drop("g")
-    simdf.createOrReplaceTempView("q587_sim")
-    out = ("WITH " + stack + "\n       "
-           + _q587_out("sm.hits_sim", "q587_documents")
-           .replace("FROM hs h", "FROM hs h JOIN q587_sim sm"
-                    " ON sm.c = h.c"))
-    return spark.sql(out)
-
-
-# --- Condorcet/Smith voting + 0/1 knapsack (q588-q589) ------------------------------------
-
-
-_Q588_ORDERS = {0: [0, 1, 2, 4, 3], 1: [0, 1, 2, 4, 3],
-                2: [1, 2, 0, 4, 3], 3: [1, 2, 0, 4, 3],
-                4: [2, 0, 1, 4, 3], 5: [2, 0, 1, 4, 3]}
-
-
-def _q588_sql(tbl: str, mat: str = "") -> str:
-    rk = ", ".join(f"({cl}, {cand}, {r})"
-                   for cl, o in _Q588_ORDERS.items()
-                   for r, cand in enumerate(o))
-    return f"""WITH rk AS (SELECT * FROM (VALUES {rk}) t(cls, cand, rnk)),
-       wc AS{mat} (SELECT doc_id % 6 AS cls,
-                CAST(count(*) AS BIGINT) AS w
-              FROM {tbl} GROUP BY doc_id % 6),
-       tot AS (SELECT CAST(sum(w) AS BIGINT) AS n FROM wc),
-       pw AS{mat} (SELECT a.cand AS a, b.cand AS b,
-                CAST(sum(CASE WHEN a.rnk < b.rnk THEN w.w
-                         ELSE 0 END) AS BIGINT) AS va
-              FROM rk a
-              JOIN rk b ON b.cls = a.cls AND b.cand <> a.cand
-              JOIN wc w ON w.cls = a.cls
-              GROUP BY a.cand, b.cand),
-       bt AS{mat} (SELECT p.a, p.b,
-                CASE WHEN 2*p.va > t.n THEN 1 ELSE 0 END AS bts
-              FROM pw p CROSS JOIN tot t),
-       nb AS{mat} (SELECT a, CAST(sum(bts) AS BIGINT) AS n_beats,
-                CAST(sum(bts * CASE b WHEN 0 THEN 1 WHEN 1 THEN 2
-                     WHEN 2 THEN 4 WHEN 3 THEN 8 ELSE 16 END)
-                     AS BIGINT) AS beats_packed
-              FROM bt GROUP BY a),
-       bd AS{mat} (SELECT r.cand,
-                CAST(sum(w.w * (4 - r.rnk)) AS BIGINT) AS borda
-              FROM rk r JOIN wc w ON w.cls = r.cls
-              GROUP BY r.cand),
-       c0 AS{mat} (SELECT a, b FROM bt WHERE bts = 1
-              UNION SELECT a.cand, a.cand
-              FROM (SELECT DISTINCT cand FROM rk) a),
-       c1 AS{mat} (SELECT DISTINCT x.a, y.b FROM c0 x
-              JOIN c0 y ON y.a = x.b),
-       c2 AS{mat} (SELECT DISTINCT x.a, y.b FROM c1 x
-              JOIN c1 y ON y.a = x.b),
-       sm AS{mat} (SELECT a,
-                CASE WHEN count(DISTINCT b) = 5 THEN 1 ELSE 0 END
-                  AS in_smith
-              FROM c2 GROUP BY a),
-       dv AS (SELECT CAST(sum(CASE WHEN s.in_smith = 1
-                AND t2.in_smith = 0 AND b.bts = 0
-                THEN 1 ELSE 0 END) AS BIGINT) AS dominance_viol
-              FROM bt b JOIN sm s ON s.a = b.a
-              JOIN sm t2 ON t2.a = b.b),
-       gl AS (SELECT
-                CAST(sum(CASE WHEN n_beats = 4 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_condorcet
-              FROM nb),
-       ns AS (SELECT CAST(sum(in_smith) AS BIGINT) AS n_smith
-              FROM sm),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(n.a AS BIGINT) AS cand, b.borda,
-              CAST(row_number() OVER (ORDER BY b.borda DESC,
-                   n.a) AS BIGINT) AS borda_rank,
-              n.n_beats, n.beats_packed,
-              CAST(s.in_smith AS BIGINT) AS in_smith,
-              g.n_condorcet, ns.n_smith, d.dominance_viol,
-              ld.n_docs
-       FROM nb n
-       JOIN bd b ON b.cand = n.a
-       JOIN sm s ON s.a = n.a
-       CROSS JOIN gl g CROSS JOIN ns CROSS JOIN dv d
-       CROSS JOIN ld"""
-
-
-@query("q588_condorcet_smith", _q588_sql("documents",
-                                         " MATERIALIZED"))
-def q588(spark, sf_dir):
-    """Condorcet paradox and Smith-set rank aggregation (Condorcet
-    1785 / Smith 1973 — the social-choice machinery under every
-    judge-panel vote, A/B-metric aggregation, and search-results
-    fusion: q497's RBO compares two rankings, this AGGREGATES an
-    electorate of them).  Six voter classes weighted by their real
-    document counts vote over 5 candidates (a 30-row inline rank
-    dim); the pairwise majority matrix is one double-join
-    aggregation.  The fixture plants the PARADOX robustly: four of
-    six classes prefer A>B, four B>C, four C>A — a majority cycle
-    immune to the small class-size imbalances, so n_condorcet == 0
-    is computed from actual weighted majorities (no candidate
-    beats all four others) while Borda happily names a winner
-    (borda_rank == 1 for A): the two aggregation rules genuinely
-    disagree, which is the paradox.  The Smith set — the smallest
-    dominant set, the standard escape — is computed as the beat-
-    graph's top reachability class (2 pointer-doubling closure
-    stages, then 'reaches all 5'): n_smith == 3 = the cycle
-    {A,B,C}, certified by dominance_viol == 0 (every Smith member
-    DIRECTLY beats every non-member — dominance re-checked against
-    the raw beat matrix, not the closure).  beats_packed emits the
-    whole tournament for the judge.  Weights scale with the
-    corpus; the cycle survives because it is a 4-2 class majority,
-    not a knife-edge."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q588_documents")
-    return spark.sql(_q588_sql("q588_documents"))
-
-
-_Q589_W = 30
-_Q589_ITEMS = [(j, (j*j*7 + j*5 + 3) % 9 + 2,
-                (j*j*11 + j*3 + 5) % 14 + 3) for j in range(12)]
-
-
-def _q589_base(tbl: str) -> str:
-    return (
-        f"it AS (SELECT j,\n"
-        f"           CAST((j*j*7 + j*5 + 3) % 9 + 2 AS BIGINT)"
-        f" AS w,\n"
-        f"           CAST((j*j*11 + j*3 + 5) % 14 + 3 AS BIGINT)"
-        f" AS v\n"
-        f"         FROM (SELECT DISTINCT doc_id % 12 AS j"
-        f" FROM {tbl}) t),\n"
-        f"       cap AS (SELECT DISTINCT doc_id % {_Q589_W + 1}"
-        f" AS c FROM {tbl}),\n"
-        f"       dp0 AS (SELECT c, CAST(0 AS BIGINT) AS val"
-        f" FROM cap)")
-
-
-def _q589_dp(j: int, prev: str) -> str:
-    return (
-        f"SELECT p.c,\n"
-        f"         greatest(p.val,\n"
-        f"           coalesce(q.val + i.v, CAST(-1 AS BIGINT)))"
-        f" AS val\n"
-        f"       FROM {prev} p\n"
-        f"       CROSS JOIN (SELECT w, v FROM it WHERE j = {j})"
-        f" i\n"
-        f"       LEFT JOIN {prev} q ON q.c = p.c - i.w")
-
-
-def _q589_walk(j: int, prev: str, dpj: str, dpp: str) -> str:
-    return (
-        f"SELECT CAST({j} AS BIGINT) AS j,\n"
-        f"         CASE WHEN cur.val <> coalesce(pv.val, -1)"
-        f" THEN 1 ELSE 0 END AS taken,\n"
-        f"         w.c - CASE WHEN cur.val <> coalesce(pv.val,"
-        f" -1) THEN i.w ELSE 0 END AS c\n"
-        f"       FROM {prev} w\n"
-        f"       CROSS JOIN (SELECT w, v FROM it WHERE j = {j})"
-        f" i\n"
-        f"       JOIN {dpj} cur ON cur.c = w.c\n"
-        f"       LEFT JOIN {dpp} pv ON pv.c = w.c")
-
-
-def _q589_final(tbl: str, mat: str, pfx: str = "") -> str:
-    un = "\n         UNION ALL ".join(
-        f"SELECT j, taken FROM {pfx}w{j}" for j in range(12))
-    return (
-        f"ch AS{mat} ({un}),\n"
-        f"       cv AS{mat} (SELECT\n"
-        f"           CAST(sum(c.taken * i.v) AS BIGINT)"
-        f" AS chosen_value,\n"
-        f"           CAST(sum(c.taken * i.w) AS BIGINT)"
-        f" AS chosen_weight,\n"
-        f"           CAST(sum(c.taken) AS BIGINT) AS n_chosen\n"
-        f"         FROM ch c JOIN it i ON i.j = c.j),\n"
-        f"       opt AS (SELECT CAST(max(val) AS BIGINT) AS opt\n"
-        f"         FROM {pfx}dp12 WHERE c = {_Q589_W}),\n"
-        f"       dns AS{mat} (SELECT j, w, v,\n"
-        f"           CAST(sum(w) OVER (ORDER BY CAST(v AS DOUBLE)"
-        f" / w DESC, j) AS BIGINT) AS cw,\n"
-        f"           CAST(row_number() OVER (ORDER BY"
-        f" CAST(v AS DOUBLE) / w DESC, j) AS BIGINT) AS rn\n"
-        f"         FROM it),\n"
-        f"       gp AS{mat} (SELECT\n"
-        f"           CAST(coalesce(sum(CASE WHEN cw <= {_Q589_W}"
-        f" THEN v END), 0) AS BIGINT) AS greedy_val,\n"
-        f"           CAST(coalesce(sum(CASE WHEN cw <= {_Q589_W}"
-        f" THEN w END), 0) AS BIGINT) AS greedy_w\n"
-        f"         FROM dns),\n"
-        f"       fr AS{mat} (SELECT d.v AS fv, d.w AS fw\n"
-        f"         FROM dns d\n"
-        f"         WHERE d.cw > {_Q589_W}\n"
-        f"           AND d.rn = (SELECT min(rn) FROM dns"
-        f" WHERE cw > {_Q589_W})),\n"
-        f"       lp AS{mat} (SELECT\n"
-        f"           CAST(g.greedy_val * f.fw\n"
-        f"             + f.fv * ({_Q589_W} - g.greedy_w)"
-        f" AS BIGINT) AS lp_num,\n"
-        f"           CAST(f.fw AS BIGINT) AS lp_den\n"
-        f"         FROM gp g CROSS JOIN fr f),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT c.j, CAST(c.taken AS BIGINT) AS taken,\n"
-        f"              i.w, i.v,\n"
-        f"              o.opt, v.chosen_value, v.chosen_weight,\n"
-        f"              v.n_chosen,\n"
-        f"              CAST(v.chosen_value - o.opt AS BIGINT)"
-        f" AS value_resid,\n"
-        f"              CAST(CASE WHEN v.chosen_weight"
-        f" <= {_Q589_W} THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS feasible,\n"
-        f"              g.greedy_val,\n"
-        f"              CAST(CASE WHEN g.greedy_val <= o.opt"
-        f" THEN 1 ELSE 0 END AS BIGINT) AS greedy_leq_opt,\n"
-        f"              l.lp_num, l.lp_den,\n"
-        f"              CAST(CASE WHEN o.opt * l.lp_den"
-        f" <= l.lp_num THEN 1 ELSE 0 END AS BIGINT)"
-        f" AS opt_leq_lp,\n"
-        f"              ld.n_docs\n"
-        f"       FROM ch c JOIN it i ON i.j = c.j\n"
-        f"       CROSS JOIN opt o CROSS JOIN cv v\n"
-        f"       CROSS JOIN gp g CROSS JOIN lp l CROSS JOIN ld")
-
-
-def _q589_oracle(tbl: str = "documents") -> str:
-    parts = [_q589_base(tbl)]
-    prev = "dp0"
-    for j in range(12):
-        parts.append(f"dp{j + 1} AS MATERIALIZED (\n"
-                     f"       {_q589_dp(j, prev)})")
-        prev = f"dp{j + 1}"
-    parts.append(f"w12 AS MATERIALIZED (SELECT CAST({_Q589_W}"
-                 f" AS BIGINT) AS c)")
-    wprev = "w12"
-    for j in range(11, -1, -1):
-        parts.append(f"w{j} AS MATERIALIZED (\n"
-                     f"       {_q589_walk(j, wprev, f'dp{j + 1}', f'dp{j}')})")
-        wprev = f"w{j}"
-    parts.append(_q589_final(tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q589_knapsack_dp", _q589_oracle())
-def q589(spark, sf_dir):
-    """0/1 knapsack with certificate sandwich (Bellman 1957; the
-    budgeted-selection problem behind every 'fill the context
-    window / the shard / the crawl budget with max-value items'
-    decision — q461 kv-cache and q443 sample-planning's exact
-    combinatorial core).  The DP unrolls ITEM-synchronously: stage
-    j is one self-join of the capacity table at offsets 0 and w_j
-    (engine localCheckpoints each stage — 2 references — oracle
-    runs the IDENTICAL text MATERIALIZED), then the chosen set
-    RECONSTRUCTS by a 12-stage backward walk (taken iff dp_j(c)
-    <> dp_{j-1}(c), capacity decrements accordingly).  The answer
-    certifies itself from three directions: value_resid == 0 (the
-    walked set's summed value equals the DP optimum — the
-    reconstruction really is an argmax witness), feasible == 1
-    (summed weight 29 <= 30), and the classic SANDWICH computed
-    exactly — density-prefix greedy 66 <= opt 76 <= fractional LP
-    bound 78 (greedy_leq_opt and opt_leq_lp as integer
-    cross-multiplied inequalities, lp as an exact rational
-    lp_num/lp_den; the strict gaps on both sides prove the
-    instance genuinely needs the DP: greedy leaves 10 value on
-    the table and rounding the LP loses 2).  Density ordering
-    uses IEEE v/w doubles identically in both engines (comparison
-    only, never compared values).  All exact BIGINT; n_docs ties
-    output to corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q589_documents")
-    base = _q589_base("q589_documents")
-    for tv in ("it", "cap", "dp0"):
-        _ckpt_view(spark, f"WITH {base} SELECT * FROM {tv}",
-                   f"q589_{tv}")
-    prev = "q589_dp0"
-    for j in range(12):
-        _ckpt_view(spark, _q589_dp(j, prev)
-                   .replace("FROM it", "FROM q589_it"),
-                   f"q589_dp{j + 1}")
-        prev = f"q589_dp{j + 1}"
-    _ckpt_view(spark, f"SELECT CAST({_Q589_W} AS BIGINT) AS c",
-               "q589_w12")
-    wprev = "q589_w12"
-    for j in range(11, -1, -1):
-        _ckpt_view(spark, _q589_walk(j, wprev, f"q589_dp{j + 1}",
-                                     f"q589_dp{j}")
-                   .replace("FROM it", "FROM q589_it"),
-                   f"q589_w{j}")
-        wprev = f"q589_w{j}"
-    fin = _q589_final("q589_documents", "", "q589_") \
-        .replace("JOIN it i", "JOIN q589_it i") \
-        .replace("FROM it)", "FROM q589_it)")
-    return spark.sql("WITH " + fin)
-
-
-# --- Web bowtie decomposition + König matching (q590-q591) --------------------------------
-
-
-_Q590_EDGES = sorted(
-    {(v, (v + 1) % 5) for v in range(5)}
-    | {(2, 0), (5, 0), (6, 5), (3, 7), (7, 8), (6, 9), (10, 8),
-       (5, 11), (11, 7), (12, 13), (13, 12), (15, 14)})
-
-
-def _q590_base(tbl: str) -> str:
-    eg = ", ".join(f"({a}, {b})" for a, b in _Q590_EDGES)
-    return (
-        f"nd AS (SELECT DISTINCT doc_id % 16 AS v FROM {tbl}),\n"
-        f"       eg AS (SELECT * FROM (VALUES {eg}) t(a, b)),\n"
-        f"       c0 AS (SELECT v AS a, v AS b FROM nd\n"
-        f"         UNION SELECT a, b FROM eg)")
-
-
-_Q590_STAGES = 4
-
-
-def _q590_final(cF: str, cP: str, tbl: str, mat: str) -> str:
-    return (
-        f"scc AS{mat} (SELECT r.a AS v,\n"
-        f"           CAST(min(r.b) AS BIGINT) AS scc_id,\n"
-        f"           CAST(count(*) AS BIGINT) AS scc_size\n"
-        f"         FROM {cF} r JOIN {cF} s\n"
-        f"           ON s.a = r.b AND s.b = r.a\n"
-        f"         GROUP BY r.a),\n"
-        f"       core AS{mat} (SELECT\n"
-        f"           CAST(min((64 - scc_size)*16 + scc_id) % 16\n"
-        f"                AS BIGINT) AS cid FROM scc),\n"
-        f"       cm AS{mat} (SELECT s.v FROM scc s CROSS JOIN"
-        f" core c WHERE s.scc_id = c.cid),\n"
-        f"       fl AS{mat} (SELECT n.v,\n"
-        f"           max(CASE WHEN r1.a IS NOT NULL THEN 1 ELSE 0"
-        f" END) AS rc,\n"
-        f"           max(CASE WHEN r2.a IS NOT NULL THEN 1 ELSE 0"
-        f" END) AS cr\n"
-        f"         FROM nd n CROSS JOIN cm c\n"
-        f"         LEFT JOIN {cF} r1 ON r1.a = n.v AND r1.b = c.v\n"
-        f"         LEFT JOIN {cF} r2 ON r2.a = c.v AND r2.b = n.v\n"
-        f"         GROUP BY n.v),\n"
-        f"       sets AS{mat} (SELECT f.v, f.rc, f.cr,\n"
-        f"           CASE WHEN m.v IS NOT NULL THEN 0\n"
-        f"                WHEN f.rc = 1 AND f.cr = 0 THEN 1\n"
-        f"                WHEN f.cr = 1 AND f.rc = 0 THEN 2\n"
-        f"                ELSE -1 END AS base_cls\n"
-        f"         FROM fl f LEFT JOIN cm m ON m.v = f.v),\n"
-        f"       tt AS{mat} (SELECT s.v, s.rc, s.cr,\n"
-        f"           CASE WHEN s.base_cls >= 0 THEN s.base_cls\n"
-        f"                WHEN fi.a IS NOT NULL AND"
-        f" to2.a IS NOT NULL THEN 3\n"
-        f"                WHEN fi.a IS NOT NULL OR"
-        f" to2.a IS NOT NULL THEN 4\n"
-        f"                ELSE 5 END AS cls\n"
-        f"         FROM sets s\n"
-        f"         LEFT JOIN (SELECT DISTINCT r.b AS a FROM {cF} r\n"
-        f"           JOIN sets i ON i.v = r.a"
-        f" AND i.base_cls = 1) fi ON fi.a = s.v\n"
-        f"         LEFT JOIN (SELECT DISTINCT r.a FROM {cF} r\n"
-        f"           JOIN sets o ON o.v = r.b"
-        f" AND o.base_cls = 2) to2 ON to2.a = s.v),\n"
-        f"       cd AS{mat} (SELECT CAST(count(*) AS BIGINT)"
-        f" AS condensation_viol\n"
-        f"         FROM {cF} r JOIN {cF} s ON s.a = r.b"
-        f" AND s.b = r.a\n"
-        f"         JOIN scc x ON x.v = r.a\n"
-        f"         JOIN scc y ON y.v = r.b\n"
-        f"         WHERE x.scc_id <> y.scc_id),\n"
-        f"       cv AS{mat} (SELECT\n"
-        f"           CAST((SELECT count(*) FROM {cF})\n"
-        f"             - (SELECT count(*) FROM {cP}) AS BIGINT)"
-        f" AS closure_resid),\n"
-        f"       cnt AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN cls = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_core,\n"
-        f"           CAST(sum(CASE WHEN cls = 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_in,\n"
-        f"           CAST(sum(CASE WHEN cls = 2 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_out,\n"
-        f"           CAST(sum(CASE WHEN cls = 3 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_tube,\n"
-        f"           CAST(sum(CASE WHEN cls = 4 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_tendril,\n"
-        f"           CAST(sum(CASE WHEN cls = 5 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_disc\n"
-        f"         FROM tt),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT CAST(t.v AS BIGINT) AS v,\n"
-        f"              s.scc_id, s.scc_size,\n"
-        f"              CAST(t.cls AS BIGINT) AS cls,\n"
-        f"              CAST(t.rc AS BIGINT) AS reaches_core,\n"
-        f"              CAST(t.cr AS BIGINT) AS core_reaches,\n"
-        f"              c.n_core, c.n_in, c.n_out, c.n_tube,\n"
-        f"              c.n_tendril, c.n_disc,\n"
-        f"              d.condensation_viol, z.closure_resid,\n"
-        f"              ld.n_docs\n"
-        f"       FROM tt t\n"
-        f"       JOIN scc s ON s.v = t.v\n"
-        f"       CROSS JOIN cnt c CROSS JOIN cd d\n"
-        f"       CROSS JOIN cv z CROSS JOIN ld")
-
-
-def _q590_oracle(tbl: str = "documents") -> str:
-    parts = [_q590_base(tbl)]
-    for k in range(1, _Q590_STAGES + 1):
-        parts.append(f"c{k} AS MATERIALIZED (\n"
-                     f"       {_q568_double(f'c{k - 1}')})")
-    parts.append(_q590_final(f"c{_Q590_STAGES}",
-                             f"c{_Q590_STAGES - 1}", tbl,
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q590_web_bowtie", _q590_oracle())
-def q590(spark, sf_dir):
-    """Web bowtie decomposition (Broder et al. 2000 — THE
-    structural map of the web graph: the giant strongly-connected
-    CORE, the IN pages that reach it, the OUT pages it reaches,
-    TUBES from IN to OUT that bypass it, TENDRILS, and the
-    DISCONNECTED rest; the classification a crawler's frontier
-    strategy lives on).  One transitive closure (the q568 doubling
-    machinery, 4 stages, fixpoint EMITTED as closure_resid == 0)
-    yields everything: SCCs as mutual-reachability classes
-    (scc_id = min member — no Tarjan stack, no recursion), the
-    core as the largest SCC, and each node's class from two
-    reachability flags plus from-IN / to-OUT joins.  The 16-node
-    fixture plants every class and the output certifies the
-    structure: n_core == 5 (ring + chord, pairwise-mutual BY
-    CONSTRUCTION OF scc — scc_size == 5 on each member), n_in ==
-    2, n_out == 2, n_tube == 1 (the IN->11->OUT bypass), n_tendril
-    == 2 (one hanging off IN, one feeding OUT), n_disc == 4
-    including a SECOND 2-cycle SCC (12<->13) that correctly loses
-    the largest-SCC tiebreak — and condensation_viol == 0 proves
-    the SCC quotient is a DAG (no cross-SCC mutual reach: the
-    theorem that makes 'condensation' well-defined, checked over
-    all closure pairs).  The six class counts partition all 16
-    nodes.  Scale: closure is O(log diameter) joins — the
-    web-scale SCC story is exactly this plan with partitioned
-    joins."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q590_documents")
-    base = _q590_base("q590_documents")
-    for tv in ("nd", "eg", "c0"):
-        _ckpt_view(spark, f"WITH {base} SELECT * FROM {tv}",
-                   f"q590_{tv}")
-    prev = "q590_c0"
-    for k in range(1, _Q590_STAGES + 1):
-        _ckpt_view(spark, _q568_double(prev), f"q590_c{k}")
-        prev = f"q590_c{k}"
-    fin = _q590_final(f"q590_c{_Q590_STAGES}",
-                      f"q590_c{_Q590_STAGES - 1}",
-                      "q590_documents", "") \
-        .replace("FROM nd n", "FROM q590_nd n")
-    return spark.sql("WITH " + fin)
-
-
-_Q591_EDGES = [(0, 0), (0, 1), (1, 0), (1, 1), (2, 0), (2, 1),
-               (3, 2), (3, 3), (4, 3), (4, 4), (5, 4), (5, 5)]
-
-
-def _q591_sql(tbl: str, divop: str, mat: str = "") -> str:
-    eg = ", ".join(f"({a}, {b}, {1 << b})" for a, b in _Q591_EDGES)
-    parts = [
-        f"eg AS (SELECT * FROM (VALUES {eg}) t(l, r, pw))",
-        f"mk AS (SELECT DISTINCT doc_id % 64 AS m FROM {tbl})",
-        f"dp0 AS (SELECT m, CAST(0 AS BIGINT) AS val FROM mk)"]
-    prev = "dp0"
-    for l in range(6):
-        parts.append(
-            f"dp{l + 1} AS{mat} (SELECT p.m,\n"
-            f"           greatest(p.val, coalesce(max(q.val + 1),"
-            f" CAST(-1 AS BIGINT))) AS val\n"
-            f"         FROM {prev} p\n"
-            f"         LEFT JOIN eg e ON e.l = {l}\n"
-            f"           AND (p.m {divop} e.pw) % 2 = 1\n"
-            f"         LEFT JOIN {prev} q ON q.m = p.m - e.pw\n"
-            f"         GROUP BY p.m, p.val)")
-        prev = f"dp{l + 1}"
-    parts.append(
-        f"mm AS (SELECT CAST(val AS BIGINT) AS matching\n"
-        f"         FROM {prev} WHERE m = 63)")
-    parts.append(
-        f"cov AS{mat} (SELECT a.m AS ls, b.m AS rs,\n"
-        f"           CAST(sum(CASE WHEN (a.m {divop}"
-        f" (CASE e.l WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4"
-        f" WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END)) % 2 = 0\n"
-        f"               AND (b.m {divop} e.pw) % 2 = 0\n"
-        f"               THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS uncovered\n"
-        f"         FROM mk a CROSS JOIN mk b CROSS JOIN eg e\n"
-        f"         GROUP BY a.m, b.m)")
-    # popcount via 6-bit expansion
-    pc = " + ".join(f"(x {{d}} {1 << k}) % 2" for k in range(6))
-    parts.append(
-        f"mc AS{mat} (SELECT\n"
-        f"           CAST(min(({pc.format(d=divop).replace('x', 'c.ls')}\n"
-        f"             + {pc.format(d=divop).replace('x', 'c.rs')})*4096\n"
-        f"             + c.ls*64 + c.rs) AS BIGINT) AS k\n"
-        f"         FROM cov c WHERE c.uncovered = 0)")
-    parts.append(
-        f"hall AS{mat} (SELECT a.m AS s,\n"
-        f"           CAST({pc.format(d=divop).replace('x', 'a.m')}"
-        f" AS BIGINT) AS sz,\n"
-        f"           CAST(count(DISTINCT CASE WHEN (a.m {divop}\n"
-        f"             (CASE e.l WHEN 0 THEN 1 WHEN 1 THEN 2"
-        f" WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32"
-        f" END)) % 2 = 1 THEN e.r END) AS BIGINT) AS nbr\n"
-        f"         FROM mk a CROSS JOIN eg e GROUP BY a.m)")
-    parts.append(
-        f"hd AS (SELECT CAST(max(sz - nbr) AS BIGINT) AS maxdef,\n"
-        f"           CAST(min(CASE WHEN sz - nbr = (SELECT"
-        f" max(sz - nbr) FROM hall) THEN s END) AS BIGINT)"
-        f" AS argdef FROM hall)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT e.l,\n"
-        f"              CAST(count(*) AS BIGINT) AS degree,\n"
-        f"              max(m.matching) AS matching,\n"
-        f"              CAST(max(c.k) {divop} 4096 AS BIGINT)"
-        f" AS cover_size,\n"
-        f"              CAST((max(c.k) % 4096) {divop} 64"
-        f" AS BIGINT) AS cover_ls,\n"
-        f"              CAST(max(c.k) % 64 AS BIGINT)"
-        f" AS cover_rs,\n"
-        f"              CAST(max(m.matching)"
-        f" - max(c.k) {divop} 4096 AS BIGINT) AS konig_resid,\n"
-        f"              max(h.maxdef) AS max_deficiency,\n"
-        f"              max(h.argdef) AS deficiency_set,\n"
-        f"              CAST(max(m.matching) - (6 - max(h.maxdef))"
-        f" AS BIGINT) AS hall_resid,\n"
-        f"              max(ld.n_docs) AS n_docs\n"
-        f"       FROM eg e\n"
-        f"       CROSS JOIN mm m CROSS JOIN mc c\n"
-        f"       CROSS JOIN hd h CROSS JOIN ld\n"
-        f"       GROUP BY e.l")
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q591_konig_matching", _q591_sql("documents", "//",
-                                        " MATERIALIZED"))
-def q591(spark, sf_dir):
-    """Bipartite maximum matching with the full LP-duality
-    certificate chain (König 1931 / Hall 1935 — the assignment
-    core under q552's stable matching and every crawler-to-shard
-    or task-to-worker allocation).  Three INDEPENDENT computations
-    meet: (1) max matching by a bitmask DP over right-node subsets
-    — 6 item-synchronous stages, each one LEFT JOIN of the 64-row
-    mask table against the edge dim (membership and removal by
-    div/mod on the edge's inlined power — no bit operators, the
-    q476 lesson); (2) the minimum VERTEX COVER by exhaustion over
-    all 64 x 64 subset pairs (feasibility = zero uncovered edges
-    counted per pair, popcounts by 6-bit expansion, argmin with
-    the packed tie rule); (3) the worst HALL DEFICIENCY max(|S| -
-    |N(S)|) over all 64 left subsets.  König's theorem and the
-    defect Hall theorem then ride the output as computed integers:
-    konig_resid == 0 (matching 5 == cover 5) and hall_resid == 0
-    (matching == 6 - deficiency 1) — strong duality verified by
-    exhaustion, not cited.  The fixture plants the deficiency:
-    left nodes {0,1,2} share only rights {0,1} (deficiency_set ==
-    7 names exactly that violator), and the emitted optimal cover
-    {L3,L4,L5, R0,R1} (cover_ls == 56, cover_rs == 3) is the
-    König construction visible in data.  All exact BIGINT."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q591_documents")
-    return spark.sql(_q591_sql("q591_documents", "div"))
-
-
-# --- URL-tree LCA + Boruvka MST (q592-q593) -----------------------------------------------
-
-
-_Q592_NODES = [
-    (0, -1, "/"), (1, 0, "/a"), (2, 0, "/b"), (3, 0, "/c"),
-    (4, 1, "/a/x"), (5, 1, "/a/y"), (6, 2, "/b/z"),
-    (7, 4, "/a/x/1"), (8, 4, "/a/x/2"), (9, 5, "/a/y/3"),
-    (10, 6, "/b/z/4"), (11, 7, "/a/x/1/p"), (12, 7, "/a/x/1/q"),
-    (13, 10, "/b/z/4/r"), (14, 0, "/ab"),
-    (15, 11, "/a/x/1/p/deep")]
-_Q592_PAIRS = [(11, 12), (15, 8), (9, 12), (13, 14), (15, 7),
-               (5, 5), (10, 6), (14, 4)]
-
-
-def _q592_sql(tbl: str, mat: str = "") -> str:
-    nd = ", ".join(f"({v}, {p}, '{s}', {len(s)})"
-                   for v, p, s in _Q592_NODES)
-    pr = ", ".join(f"({a}, {b})" for a, b in _Q592_PAIRS)
-    return f"""WITH nd AS (SELECT * FROM (VALUES {nd}) t(v, par, path, plen)),
-       pq AS (SELECT * FROM (VALUES {pr}) t(u, v)),
-       a0 AS (SELECT v AS x, v AS anc FROM nd
-              UNION SELECT v, par FROM nd WHERE par >= 0),
-       a1 AS{mat} (SELECT DISTINCT p.x, q.anc FROM a0 p
-              JOIN a0 q ON q.x = p.anc),
-       a2 AS{mat} (SELECT DISTINCT p.x, q.anc FROM a1 p
-              JOIN a1 q ON q.x = p.anc),
-       a3 AS{mat} (SELECT DISTINCT p.x, q.anc FROM a2 p
-              JOIN a2 q ON q.x = p.anc),
-       dep AS{mat} (SELECT x, CAST(count(*) - 1 AS BIGINT) AS d
-              FROM a3 GROUP BY x),
-       lca AS{mat} (SELECT p.u, p.v,
-                CAST(min((16 - d.d)*16 + au.anc) % 16 AS BIGINT)
-                  AS lca_graph
-              FROM pq p
-              JOIN a3 au ON au.x = p.u
-              JOIN a3 av ON av.x = p.v AND av.anc = au.anc
-              JOIN dep d ON d.x = au.anc
-              GROUP BY p.u, p.v),
-       lcp AS{mat} (SELECT p.u, p.v,
-                CAST(min((64 - c.plen)*16 + c.v) % 16 AS BIGINT)
-                  AS lca_path
-              FROM pq p
-              JOIN nd nu ON nu.v = p.u
-              JOIN nd nv ON nv.v = p.v
-              JOIN nd c ON
-                (nu.path = c.path OR c.path = '/'
-                 OR (substr(nu.path, 1, c.plen) = c.path
-                     AND substr(nu.path, c.plen + 1, 1) = '/'))
-                AND (nv.path = c.path OR c.path = '/'
-                 OR (substr(nv.path, 1, c.plen) = c.path
-                     AND substr(nv.path, c.plen + 1, 1) = '/'))
-              GROUP BY p.u, p.v),
-       tc AS{mat} (SELECT
-                CAST(sum(CASE WHEN c.par >= 0
-                     AND dc.d <> dp.d + 1 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS depth_viol,
-                CAST(sum(CASE WHEN c.par < 0 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_roots
-              FROM nd c
-              JOIN dep dc ON dc.x = c.v
-              LEFT JOIN dep dp ON dp.x = c.par),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(g.u AS BIGINT) AS u, CAST(g.v AS BIGINT) AS v,
-              g.lca_graph, s.lca_path,
-              CAST(g.lca_graph - s.lca_path AS BIGINT)
-                AS method_resid,
-              dl.d AS lca_depth,
-              CAST(du.d + dv.d - 2*dl.d AS BIGINT) AS tree_dist,
-              n2.path AS lca_url,
-              t.depth_viol, t.n_roots, ld.n_docs
-       FROM lca g
-       JOIN lcp s ON s.u = g.u AND s.v = g.v
-       JOIN dep du ON du.x = g.u
-       JOIN dep dv ON dv.x = g.v
-       JOIN dep dl ON dl.x = g.lca_graph
-       JOIN nd n2 ON n2.v = g.lca_graph
-       CROSS JOIN tc t CROSS JOIN ld"""
-
-
-@query("q592_url_tree_lca", _q592_sql("documents",
-                                      " MATERIALIZED"))
-def q592(spark, sf_dir):
-    """Lowest common ancestor on a URL directory tree (Aho-Hopcroft
-    -Ullman 1973 LCA, aimed at the q165 URL-canonicalization
-    family: 'what is the deepest common section of these two
-    pages?' is sitemap clustering, breadcrumb inference, and
-    robots-scope resolution in one primitive).  TWO independent
-    derivations per query pair, their agreement emitted: (1) GRAPH
-    — ancestor sets by 3 pointer-doubling closures over parent
-    pointers, LCA = the common ancestor of maximum depth (packed
-    argmin (16-d)*16+v); (2) STRING — the deepest node whose path
-    is a boundary-aware prefix of BOTH URLs (equal, or root, or
-    prefix followed by '/').  method_resid == 0 on all 8 pairs
-    includes the planted trap: '/ab' vs '/a/x' must meet at the
-    ROOT, not at '/a' — naive string-prefix matching gives the
-    wrong ancestor, the segment-boundary check is load-bearing
-    and this pair proves it fired.  The pair set covers every
-    regime: siblings, cross-subtree, cross-tree (LCA = root),
-    ancestor-descendant (LCA = the ancestor itself), parent-child,
-    and u == v (LCA = self, tree_dist == 0).  tree_dist = d(u) +
-    d(v) - 2 d(lca) is the tree metric; depth_viol == 0 and
-    n_roots == 1 certify the tree itself (every child exactly one
-    deeper than its parent).  All exact BIGINT except the emitted
-    URL string."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q592_documents")
-    return spark.sql(_q592_sql("q592_documents"))
-
-
-_Q593_PTS = [(0, 0), (3, 1), (5, 0), (7, 2), (2, 4), (5, 4),
-             (8, 5), (1, 7), (4, 8), (7, 8)]
-_Q593_EDGES = [
-    (i, j, ((_Q593_PTS[i][0] - _Q593_PTS[j][0]) ** 2
-            + (_Q593_PTS[i][1] - _Q593_PTS[j][1]) ** 2) * 100 + k)
-    for k, (i, j) in enumerate(
-        (i, j) for i in range(10) for j in range(i + 1, 10))]
-_Q593_EDGES = [e for e in _Q593_EDGES if e[2] < 3000]
-
-
-def _q593_base(tbl: str) -> str:
-    eg = ", ".join(f"({a}, {b}, {w})" for a, b, w in _Q593_EDGES)
-    return (
-        f"nd AS (SELECT DISTINCT doc_id % 10 AS v FROM {tbl}),\n"
-        f"       eg AS (SELECT * FROM (VALUES {eg}) t(a, b, w)),\n"
-        f"       s0 AS (SELECT a, b, w FROM eg WHERE 1 = 0)")
-
-
-def _q593_labels(sel: str, pfx: str, mat: str) -> str:
-    return (
-        f"{pfx}l0 AS{mat} (SELECT v AS x, v AS lab FROM nd\n"
-        f"         UNION SELECT a, b FROM {sel}\n"
-        f"         UNION SELECT b, a FROM {sel}),\n"
-        f"       {pfx}l1 AS{mat} (SELECT DISTINCT p.x, q.lab"
-        f" FROM {pfx}l0 p JOIN {pfx}l0 q ON q.x = p.lab),\n"
-        f"       {pfx}l2 AS{mat} (SELECT DISTINCT p.x, q.lab"
-        f" FROM {pfx}l1 p JOIN {pfx}l1 q ON q.x = p.lab),\n"
-        f"       {pfx}l3 AS{mat} (SELECT DISTINCT p.x, q.lab"
-        f" FROM {pfx}l2 p JOIN {pfx}l2 q ON q.x = p.lab),\n"
-        f"       {pfx}l4 AS{mat} (SELECT DISTINCT p.x, q.lab"
-        f" FROM {pfx}l3 p JOIN {pfx}l3 q ON q.x = p.lab),\n"
-        f"       {pfx}lb AS{mat} (SELECT x,"
-        f" CAST(min(lab) AS BIGINT) AS lab\n"
-        f"         FROM {pfx}l4 GROUP BY x)")
-
-
-def _q593_round(sel: str, lb: str) -> str:
-    side = (
-        f"SELECT {{comp}} AS comp, e.w*1024 + e.b*32 + e.a AS mk\n"
-        f"               FROM eg e\n"
-        f"               JOIN {lb} la ON la.x = e.a\n"
-        f"               JOIN {lb} lc ON lc.x = e.b\n"
-        f"               WHERE la.lab <> lc.lab")
-    return (
-        f"SELECT a, b, w FROM {sel}\n"
-        f"       UNION\n"
-        f"       SELECT CAST(mk % 32 AS BIGINT) AS a,\n"
-        f"              CAST((mk % 1024) {{divop}} 32 AS BIGINT)"
-        f" AS b, CAST(mk {{divop}} 1024 AS BIGINT) AS w\n"
-        f"       FROM (SELECT min(mk) AS mk FROM (\n"
-        f"             {side.format(comp='la.lab')}\n"
-        f"             UNION ALL\n"
-        f"             {side.format(comp='lc.lab')}) o\n"
-        f"             GROUP BY comp) m")
-
-
-def _q593_final(selF: str, lbF: str, tbl: str, mat: str) -> str:
-    return (
-        f"wt AS{mat} (SELECT CAST(count(*) AS BIGINT) AS n_tree,\n"
-        f"           CAST(sum(w) AS BIGINT) AS mst_weight\n"
-        f"         FROM {selF}),\n"
-        f"       cc AS{mat} (SELECT CAST(count(DISTINCT lab)"
-        f" AS BIGINT) AS n_components FROM {lbF}),\n"
-        f"       tr AS{mat} (SELECT a AS x, b AS y, w FROM {selF}\n"
-        f"         UNION ALL SELECT b, a, w FROM {selF}),\n"
-        f"       p0 AS{mat} (SELECT x, y, w AS mx FROM tr\n"
-        f"         UNION SELECT v, v, CAST(0 AS BIGINT) FROM nd),\n"
-        f"       p1 AS{mat} (SELECT u.x, v2.y,\n"
-        f"           CAST(min(greatest(u.mx, v2.mx)) AS BIGINT)"
-        f" AS mx\n"
-        f"         FROM p0 u JOIN p0 v2 ON v2.x = u.y\n"
-        f"         GROUP BY u.x, v2.y),\n"
-        f"       p2 AS{mat} (SELECT u.x, v2.y,\n"
-        f"           CAST(min(greatest(u.mx, v2.mx)) AS BIGINT)"
-        f" AS mx\n"
-        f"         FROM p1 u JOIN p1 v2 ON v2.x = u.y\n"
-        f"         GROUP BY u.x, v2.y),\n"
-        f"       p3 AS{mat} (SELECT u.x, v2.y,\n"
-        f"           CAST(min(greatest(u.mx, v2.mx)) AS BIGINT)"
-        f" AS mx\n"
-        f"         FROM p2 u JOIN p2 v2 ON v2.x = u.y\n"
-        f"         GROUP BY u.x, v2.y),\n"
-        f"       cyc AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN p.mx >= e.w THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS cycle_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_nontree\n"
-        f"         FROM eg e\n"
-        f"         JOIN p3 p ON p.x = e.a AND p.y = e.b\n"
-        f"         LEFT JOIN {selF} s ON s.a = e.a"
-        f" AND s.b = e.b AND s.w = e.w\n"
-        f"         WHERE s.a IS NULL),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"       SELECT s.a, s.b, s.w,\n"
-        f"              t.n_tree, t.mst_weight, c.n_components,\n"
-        f"              y.cycle_viol, y.n_nontree, ld.n_docs\n"
-        f"       FROM {selF} s\n"
-        f"       CROSS JOIN wt t CROSS JOIN cc c\n"
-        f"       CROSS JOIN cyc y CROSS JOIN ld")
-
-
-_Q593_ROUNDS = 3
-
-
-def _q593_oracle(tbl: str = "documents") -> str:
-    parts = [_q593_base(tbl)]
-    sel = "s0"
-    for r in range(1, _Q593_ROUNDS + 1):
-        parts.append(_q593_labels(sel, f"r{r}", " MATERIALIZED"))
-        parts.append(
-            f"s{r} AS MATERIALIZED (\n"
-            f"       {_q593_round(sel, f'r{r}lb').format(divop='//')})")
-        sel = f"s{r}"
-    parts.append(_q593_labels(sel, "fin", " MATERIALIZED"))
-    parts.append(_q593_final(sel, "finlb", tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q593_boruvka_mst", _q593_oracle())
-def q593(spark, sf_dir):
-    """Boruvka's minimum spanning tree (Boruvka 1926 — the ONLY
-    classical MST algorithm that is round-synchronous by birth,
-    which is why every distributed MST paper is Boruvka underneath;
-    the backbone step in single-linkage clustering, network design,
-    and the q513 proximity-graph family).  Each round: label
-    components by pointer-doubling min-label closure over the
-    selected edges, then every component picks its minimum outgoing
-    edge with the tie rule packed (min(w*1024 + b*32 + a), grouped
-    by the UNORDERED component pair so both endpoints' picks
-    dedup); distinct weights make the MST unique.  Three rounds
-    unroll (round 3 selects nothing — convergence is emitted as
-    n_components == 1); engine localCheckpoints every label/select
-    stage via _ckpt_view, oracle runs the IDENTICAL text
-    MATERIALIZED.  The result then passes the FULL MST
-    verification (Tarjan's certificate), computed not cited:
-    n_tree == 9 == n-1 and n_components == 1 (spanning), and the
-    CYCLE PROPERTY — for every one of the 15 non-tree edges, the
-    maximum edge weight on its tree path is computed by three
-    min-of-max pointer-doubling hops over the tree (the bottleneck
-    metric) and cycle_viol == 0 certifies each non-tree edge is
-    strictly the heaviest on the cycle it would close; with
-    distinct weights this is a PROOF the emitted tree is THE
-    minimum spanning tree, no reference Kruskal needed.
-    mst_weight == 8124 on the 10-site, 24-edge planar fixture.
-
-    Round-5 engine restructure (the r4 verdict's #2, the q599
-    precedent): the ~11 per-stage checkpoint jobs (6.8 s of driver
-    latency) are replaced by driver-side Boruvka rounds over the
-    24-edge LITERAL (min-label components, the packed
-    min(w*1024 + b*32 + a) pick per component side, spec mirrored
-    bit-for-bit; the distributed rounds themselves are covered by
-    operators/graph.py::boruvka_mst + tests/test_graph_parity.py),
-    while the whole CERTIFICATE — spanning counts, min-label
-    component census, and the cycle property via three min-of-max
-    pointer-doubling hops over the emitted tree — stays relational
-    in the one audited statement."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q593_documents")
-    spark.sql("SELECT DISTINCT doc_id % 10 AS v"
-              " FROM q593_documents") \
-        .createOrReplaceTempView("q593_nd")
-    local_df(spark, _Q593_EDGES, "a long, b long, w long") \
-        .createOrReplaceTempView("q593_eg")
-    nodes = list(range(10))
-
-    def _labels(sel):
-        parent = {v: v for v in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b, _w in sel:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        lab = {}
-        comp: dict = {}
-        for v in nodes:
-            comp.setdefault(find(v), []).append(v)
-        for vs in comp.values():
-            m = min(vs)
-            for v in vs:
-                lab[v] = m
-        return lab
-
-    sel: set = set()
-    for _r in range(_Q593_ROUNDS):
-        lab = _labels(sel)
-        best: dict = {}
-        for a, b, w in _Q593_EDGES:
-            if lab[a] == lab[b]:
-                continue
-            mk = w * 1024 + b * 32 + a
-            for c in (lab[a], lab[b]):
-                if c not in best or mk < best[c]:
-                    best[c] = mk
-        for mk in best.values():
-            sel.add((mk % 32, (mk % 1024) // 32, mk // 1024))
-    finlab = _labels(sel)
-    local_df(spark, sorted(sel), "a long, b long, w long") \
-        .createOrReplaceTempView("q593_sel")
-    local_df(spark, sorted(finlab.items()), "x long, lab long") \
-        .createOrReplaceTempView("q593_finlb")
-    fin = _q593_final("q593_sel", "q593_finlb",
-                      "q593_documents", "") \
-        .replace("FROM nd", "FROM q593_nd") \
-        .replace("JOIN eg e", "JOIN q593_eg e") \
-        .replace("FROM eg e", "FROM q593_eg e")
-    return spark.sql("WITH " + fin)
-
-
-# --- k-anonymity lattice + Wald SPRT (q594-q595) ------------------------------------------
-
-
-def _q594_sql(tbl: str, divop: str, mat: str = "") -> str:
-    return f"""WITH d AS (SELECT doc_id, lang,
-                CAST(substr(source, 4) AS BIGINT) AS srcn,
-                n_chars FROM {tbl}),
-       lv AS (SELECT DISTINCT doc_id % 6 AS lv FROM {tbl}),
-       g AS{mat} (SELECT l.lv, d.doc_id,
-                CASE WHEN l.lv <= 4 THEN d.lang ELSE '*' END
-                  AS g1,
-                CAST(CASE WHEN l.lv <= 1 THEN d.srcn
-                     WHEN l.lv = 2 THEN d.srcn {divop} 5
-                     ELSE -1 END AS BIGINT) AS g2,
-                CAST(CASE WHEN l.lv = 0
-                       THEN d.n_chars {divop} 50
-                     WHEN l.lv <= 3 THEN d.n_chars {divop} 200
-                     ELSE -1 END AS BIGINT) AS g3
-              FROM d CROSS JOIN lv l),
-       cls AS{mat} (SELECT lv, g1, g2, g3,
-                CAST(count(*) AS BIGINT) AS sz,
-                CAST(count(DISTINCT doc_id % 7) AS BIGINT)
-                  AS ldiv
-              FROM g GROUP BY lv, g1, g2, g3),
-       ag AS{mat} (SELECT lv,
-                CAST(count(*) AS BIGINT) AS n_classes,
-                CAST(min(sz) AS BIGINT) AS min_size,
-                CAST(min(ldiv) AS BIGINT) AS l_diversity,
-                CAST(coalesce(sum(CASE WHEN sz < 5 THEN sz END),
-                     0) AS BIGINT) AS suppress_count
-              FROM cls GROUP BY lv),
-       ch AS (SELECT CAST(min(lv) AS BIGINT) AS chosen
-              FROM ag WHERE min_size >= 5),
-       mono AS (SELECT CAST(sum(CASE WHEN pm > min_size
-                  THEN 1 ELSE 0 END) AS BIGINT) AS monotone_viol
-              FROM (SELECT min_size,
-                      lag(min_size) OVER (ORDER BY lv) AS pm
-                    FROM ag) q WHERE pm IS NOT NULL),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT a.lv, a.n_classes, a.min_size, a.l_diversity,
-              a.suppress_count,
-              CAST(5 AS BIGINT) AS k,
-              c.chosen AS chosen_level,
-              CAST(CASE WHEN a.lv = c.chosen THEN 1 ELSE 0 END
-                   AS BIGINT) AS is_chosen,
-              CAST(CASE WHEN a.lv = c.chosen - 1
-                    AND a.min_size < 5 THEN 1 ELSE 0 END
-                   AS BIGINT) AS prev_violates,
-              m.monotone_viol, ld.n_docs
-       FROM ag a CROSS JOIN ch c CROSS JOIN mono m
-       CROSS JOIN ld"""
-
-
-@query("q594_k_anonymity", _q594_sql("documents", "//",
-                                     " MATERIALIZED"))
-def q594(spark, sf_dir):
-    """k-anonymity over a generalization lattice (Samarati &
-    Sweeney 1998 — the PII-release gate every published crawl
-    derivative passes through; q469's randomized response handles
-    values, this handles QUASI-IDENTIFIERS: the (lang, source,
-    doc-length) triple that re-identifies without naming).  Six
-    generalization levels coarsen the real columns stepwise
-    (length buckets 50 -> 200, sources grouped by 5, then
-    suppressed, then lang suppressed); each level's equivalence
-    classes, minimum class size, worst l-DIVERSITY (distinct
-    sensitive values per class — the attribute-disclosure
-    companion k-anonymity alone misses), and the suppression
-    alternative (rows that would need deleting to reach k = 5 at
-    that level) all come from ONE cross-join aggregation.  The
-    chosen release level is the MINIMAL level with min_size >= k,
-    certified minimal by prev_violates == 1 (one step finer
-    genuinely breaks k).  The coarsening theorem is emitted, not
-    assumed: monotone_viol == 0 — coarse classes are unions of
-    fine ones, so the minimum class size can only grow up the
-    lattice.  The choice MOVES with the corpus (level 3 at
-    sf0.001, level 2 at sf0.1 — more data needs less
-    generalization, the privacy-utility story in two numbers).
-    Scale: one aggregation per lattice level over a grouping-sets
-    shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q594_documents")
-    return spark.sql(_q594_sql("q594_documents", "div"))
-
-
-def _q595_sql(tbl: str, mat: str = "") -> str:
-    p2 = ", ".join(f"({t}, {1 << t})" for t in range(60))
-    p3 = ", ".join(f"({f}, {3 ** f})" for f in range(37))
-    return f"""WITH p2 AS (SELECT * FROM (VALUES {p2}) t(e, v)),
-       p3 AS (SELECT * FROM (VALUES {p3}) t(e, v)),
-       tr AS{mat} (SELECT doc_id % 6 AS s,
-                CAST(row_number() OVER (PARTITION BY doc_id % 6
-                     ORDER BY doc_id) AS BIGINT) AS t,
-                CASE WHEN (doc_id*7 + 3) % 11 <
-                  CASE doc_id % 6 WHEN 0 THEN 3 WHEN 1 THEN 3
-                    WHEN 2 THEN 6 WHEN 3 THEN 6 WHEN 4 THEN 4
-                    ELSE 2 END
-                THEN 1 ELSE 0 END AS x
-              FROM {tbl}),
-       pf AS{mat} (SELECT s, t, x,
-                CAST(sum(x) OVER (PARTITION BY s ORDER BY t)
-                     AS BIGINT) AS sc
-              FROM tr),
-       dc AS{mat} (SELECT f.s, f.t, f.sc, f.t - f.sc AS fl,
-                CASE WHEN a.v >= 9 * b.v THEN 1
-                     WHEN 9 * a.v <= b.v THEN -1
-                     ELSE 0 END AS dec
-              FROM pf f
-              JOIN p2 a ON a.e = f.t
-              JOIN p3 b ON b.e = f.t - f.sc
-              WHERE f.t <= 59 AND f.t - f.sc <= 36),
-       fx AS{mat} (SELECT s,
-                CAST(coalesce(min(CASE WHEN dec <> 0 THEN t END),
-                     -1) AS BIGINT) AS decide_t,
-                CAST(coalesce(min(CASE WHEN dec <> 0
-                     THEN t*4 + dec + 2 END) % 4 - 2, 0)
-                     AS BIGINT) AS decision
-              FROM dc GROUP BY s),
-       att AS{mat} (SELECT d.s, d.sc AS s_at, d.fl AS f_at
-              FROM dc d JOIN fx x ON x.s = d.s
-                AND x.decide_t = d.t),
-       tv AS (SELECT s, CAST(count(*) AS BIGINT) AS n_trials,
-                CAST(sum(x) AS BIGINT) AS successes
-              FROM tr GROUP BY s),
-       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs
-              FROM {tbl})
-       SELECT CAST(f.s AS BIGINT) AS s, v.n_trials, v.successes,
-              f.decision, f.decide_t,
-              CAST(coalesce(a.s_at, -1) AS BIGINT) AS s_at,
-              CAST(coalesce(a.f_at, -1) AS BIGINT) AS f_at,
-              CAST(CASE WHEN f.s IN (2, 3) THEN 1
-                   WHEN f.s = 4 THEN 0 ELSE -1 END AS BIGINT)
-                AS truth,
-              CAST(CASE WHEN f.decision =
-                    CASE WHEN f.s IN (2, 3) THEN 1
-                         WHEN f.s = 4 THEN 0 ELSE -1 END
-                   THEN 1 ELSE 0 END AS BIGINT) AS correct,
-              ld.n_docs
-       FROM fx f
-       JOIN tv v ON v.s = f.s
-       LEFT JOIN att a ON a.s = f.s
-       CROSS JOIN ld"""
-
-
-@query("q595_wald_sprt", _q595_sql("documents", " MATERIALIZED"))
-def q595(spark, sf_dir):
-    """Wald's sequential probability ratio test (Wald 1945 — the
-    optimal early-stopping A/B test; q560's CUSUM detects drift in
-    a running system, SPRT DECIDES between two hypotheses with the
-    fewest samples, which is what every experiment platform
-    actually wants).  Testing H0: p = 1/4 vs H1: p = 1/2 with
-    boundaries A = 9, B = 1/9, the likelihood ratio after s
-    successes and f failures is 2^s (2/3)^f = 2^t / 3^f — so both
-    boundary crossings are EXACT BIGINT comparisons against inlined
-    power dims (2^t >= 9*3^f accepts H1, 9*2^t <= 3^f accepts H0;
-    no logs, no floats, overflow fenced at t <= 59, f <= 36), and
-    the 'sequential' test needs NO sequential loop: one running
-    prefix sum + one min-over-crossings per series (the q560
-    closed-form move on a multiplicative walk).  Six per-host
-    trial series derive from the real doc ids (linear mod-11
-    outcome hash — the quadratic-mod-8 and quadratic-mod-11
-    variants both COLLAPSED inside the mod-6 series lattice, two
-    more entries for the gcd ledger) and every regime is live:
-    true-H1 series decide H1 at t = 7-8, true-H0 at t = 11-17
-    (the asymmetry reflects the rates' distances from the
-    indifference point), the rate-2/11 series decides FASTEST
-    among H0s (strength drives speed), and series 4 sits at
-    p = 4/11 ~ the indifference rate 0.369 and provably never
-    crosses either boundary (decision == 0 — the regime naive
-    fixed-horizon tests can't express).  correct == 1 on all six
-    rows; decision state (s_at, f_at) emitted at the crossing."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q595_documents")
-    return spark.sql(_q595_sql("q595_documents"))
-
-
-# ---------------------------------------------------------------------------
-# q596: Miller-Rabin vs Fermat primality (Carmichael numbers caught)
-
-
-_Q596_CANDS = [(9, 1, 3), (91, 45, 1), (101, 25, 2), (103, 51, 1),
-               (221, 55, 2), (561, 35, 4), (569, 71, 3),
-               (1105, 69, 4)]
-_Q596_FACT = [(9, 3), (91, 7), (91, 13), (221, 13), (221, 17),
-              (561, 3), (561, 11), (561, 17), (1105, 5),
-              (1105, 13), (1105, 17)]
-
-
-def _q596_sql(tbl: str, divop: str, mat: str = "") -> str:
-    cd = ", ".join(f"({n}, {d}, {s})" for n, d, s in _Q596_CANDS)
-    fc = ", ".join(f"({n}, {p})" for n, p in _Q596_FACT)
-    tv = ", ".join(f"({i})" for i in range(2, 41))
-    parts = [
-        f"cd AS (SELECT CAST(n AS BIGINT) AS n, CAST(d AS BIGINT)"
-        f" AS d,\n"
-        f"         CAST(s AS BIGINT) AS s\n"
-        f"       FROM (VALUES {cd}) t(n, d, s))",
-        f"fc AS (SELECT CAST(n AS BIGINT) AS n, CAST(p AS BIGINT)"
-        f" AS p\n"
-        f"       FROM (VALUES {fc}) t(n, p))",
-        f"b0 AS (SELECT DISTINCT (doc_id*13 + 7) % 211 AS b0\n"
-        f"       FROM {tbl})",
-        f"bs AS{mat} (SELECT DISTINCT c.n, c.d, c.s,\n"
-        f"         2 + b.b0 % (c.n - 3) AS b\n"
-        f"       FROM cd c CROSS JOIN b0 b)",
-        f"cp AS{mat} (SELECT b.n, b.d, b.s, b.b,\n"
-        f"         CASE WHEN count(f.p) = 0 THEN 1 ELSE 0 END\n"
-        f"           AS coprime\n"
-        f"       FROM bs b LEFT JOIN fc f\n"
-        f"         ON f.n = b.n AND b.b % f.p = 0\n"
-        f"       GROUP BY b.n, b.d, b.s, b.b)",
-        f"e7 AS{mat} (SELECT n, d, s, b, coprime,\n"
-        f"         CAST(1 AS BIGINT) AS r FROM cp)"]
-    for k in range(6, -1, -1):
-        parts.append(
-            f"e{k} AS{mat} (SELECT n, d, s, b, coprime,\n"
-            f"         ((r*r) % n * (CASE WHEN (d {divop} {1 << k})"
-            f" % 2 = 1\n"
-            f"           THEN b ELSE 1 END)) % n AS r\n"
-            f"       FROM e{k + 1})")
-    parts.append(
-        f"m0 AS{mat} (SELECT n, d, s, b, coprime, r AS y,\n"
-        f"         CASE WHEN r = 1 THEN 1 ELSE 0 END AS hit\n"
-        f"       FROM e0)")
-    for j in range(4):
-        parts.append(
-            f"m{j + 1} AS{mat} (SELECT n, d, s, b, coprime,\n"
-            f"         CASE WHEN {j + 1} <= s THEN (y*y) % n\n"
-            f"           ELSE y END AS y,\n"
-            f"         CASE WHEN y = n - 1 AND {j} <= s - 1 THEN 1\n"
-            f"           ELSE hit END AS hit\n"
-            f"       FROM m{j})")
-    parts.append(
-        f"ag AS{mat} (SELECT n,\n"
-        f"         CAST(count(*) AS BIGINT) AS n_bases,\n"
-        f"         CAST(sum(coprime) AS BIGINT) AS n_coprime,\n"
-        f"         CAST(sum(CASE WHEN coprime = 1 AND y = 1\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT) AS n_fermat,\n"
-        f"         CAST(sum(CASE WHEN coprime = 1 AND hit = 1\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT) AS n_mr\n"
-        f"       FROM m4 GROUP BY n)")
-    parts.append(
-        f"td AS{mat} (SELECT c.n,\n"
-        f"         CASE WHEN count(g.i) = 0 THEN 1 ELSE 0 END\n"
-        f"           AS is_prime\n"
-        f"       FROM cd c LEFT JOIN (SELECT CAST(i AS BIGINT)"
-        f" AS i\n"
-        f"           FROM (VALUES {tv}) t(i)) g\n"
-        f"         ON g.i*g.i <= c.n AND c.n % g.i = 0\n"
-        f"       GROUP BY c.n)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"       FROM {tbl})")
-    return (
-        "WITH " + ",\n       ".join(parts) + "\n"
-        "SELECT c.n, c.d, c.s,\n"
-        "       CAST(t.is_prime AS BIGINT) AS is_prime,\n"
-        "       a.n_bases, a.n_coprime, a.n_fermat, a.n_mr,\n"
-        "       CAST(CASE WHEN a.n_fermat = a.n_coprime THEN 1\n"
-        "            ELSE 0 END AS BIGINT) AS fermat_all,\n"
-        "       CAST(CASE WHEN t.is_prime = 0\n"
-        "            AND a.n_fermat = a.n_coprime THEN 1 ELSE 0\n"
-        "            END AS BIGINT) AS carmichael,\n"
-        "       CAST(CASE WHEN t.is_prime = 1\n"
-        "            THEN a.n_coprime - a.n_fermat ELSE 0 END\n"
-        "            AS BIGINT) AS flt_viol,\n"
-        "       CAST(CASE WHEN t.is_prime = 1\n"
-        "            THEN a.n_coprime - a.n_mr ELSE 0 END\n"
-        "            AS BIGINT) AS mr_complete_viol,\n"
-        "       CAST(CASE WHEN t.is_prime = 1 THEN 1\n"
-        "            WHEN a.n_mr < a.n_coprime THEN 1 ELSE 0 END\n"
-        "            AS BIGINT) AS mr_sound,\n"
-        "       CAST(CASE WHEN t.is_prime = 1 THEN 1\n"
-        "            WHEN 4*a.n_mr <= a.n_coprime THEN 1 ELSE 0\n"
-        "            END AS BIGINT) AS rabin_bound_ok,\n"
-        "       ld.n_docs\n"
-        "FROM cd c JOIN ag a ON a.n = c.n\n"
-        "JOIN td t ON t.n = c.n CROSS JOIN ld")
-
-
-@query("q596_miller_rabin", _q596_sql("documents", "//",
-                                      " MATERIALIZED"))
-def q596(spark, sf_dir):
-    """Miller-Rabin vs Fermat primality testing (Rabin 1980 — the
-    probable-prime gate behind every key-generation and hash-family
-    pick; q575's Merkle and q576's ring both lean on hash/modulus
-    choices this test certifies).  Everything is exact BIGINT: the
-    modexp a^d mod n runs as 7 unrolled square-and-multiply stages
-    (bit k of d read by (d div 2^k) % 2 — no pow(), no floats; all
-    intermediates < 1105^2 so no overflow), then 4 squaring stages
-    lift a^d to a^(n-1) with the strong-probable-prime hit
-    accumulated en route (y == 1 up front or y == n-1 before the
-    s-th squaring), so FERMAT'S test falls out of the SAME chain at
-    j = s (a^(n-1) == 1) — one plan, both tests.  Bases derive from
-    the real doc ids (211 residues), coprimality via the inlined
-    factor dim, and ground truth is an INDEPENDENT relational trial
-    division (divisor dim to 40 > sqrt(1105)).  Every regime is
-    live and certified: Fermat's little theorem VERIFIED on the
-    data (flt_viol == 0 on primes 101/103/569) and MR's
-    completeness too (mr_complete_viol == 0 — primes have NO
-    strong witnesses); ordinary composites 91/221 leak Fermat
-    liars (34/70, 14/183 coprime bases) but never all; the
-    Carmichael numbers 561 and 1105 fool Fermat on EVERY coprime
-    base (carmichael == 1 — the absolute-pseudoprime class that
-    breaks Fermat as a primality test) while Miller-Rabin still
-    convicts (mr_sound == 1: 3/121 and 5/146 strong liars), and
-    Rabin's 1/4 theorem holds as an integer inequality on every
-    composite (rabin_bound_ok == 1: 4*liars <= coprime bases).
-    Scale: base set is bounded (211), candidates a dim — the plan
-    is a constant-size chain of projections over one distinct
-    scan."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q596_documents")
-    return spark.sql(_q596_sql("q596_documents", "div"))
-
-
-# ---------------------------------------------------------------------------
-# q597: 2-SAT via implication-graph SCC (Aspvall-Plass-Tarjan)
-
-
-_Q597_CL = [(0, 0, 2), (0, 0, 3), (0, 1, 4), (0, 5, 7), (0, 6, 8),
-            (0, 8, 10), (0, 3, 10), (0, 2, 11),
-            (1, 12, 14), (1, 12, 15), (1, 13, 14), (1, 13, 15)]
-_Q597_STAGES = 4
-
-
-def _q597_base(tbl: str) -> str:
-    cl = ", ".join(f"({i}, {a}, {b})" for i, a, b in _Q597_CL)
-    return (
-        f"nd AS (SELECT DISTINCT doc_id % 16 AS v FROM {tbl}),\n"
-        f"       cl AS (SELECT CAST(i AS BIGINT) AS i,\n"
-        f"           CAST(a AS BIGINT) AS a, CAST(b AS BIGINT)"
-        f" AS b\n"
-        f"         FROM (VALUES {cl}) t(i, a, b)),\n"
-        f"       ed AS (SELECT a + 1 - 2*(a % 2) AS u, b AS w\n"
-        f"           FROM cl\n"
-        f"         UNION ALL\n"
-        f"         SELECT b + 1 - 2*(b % 2), a FROM cl),\n"
-        f"       c0 AS (SELECT v AS a, v AS b FROM nd\n"
-        f"         UNION SELECT u, w FROM ed)")
-
-
-def _q597_final(cF: str, cP: str, tbl: str, mat: str,
-                divop: str) -> str:
-    return (
-        f"scc AS{mat} (SELECT r.a AS l,\n"
-        f"           CAST(min(s.a) AS BIGINT) AS scc_id\n"
-        f"         FROM {cF} r JOIN {cF} s\n"
-        f"           ON s.a = r.b AND s.b = r.a\n"
-        f"         GROUP BY r.a),\n"
-        f"       orc AS{mat} (SELECT a AS l,\n"
-        f"           CAST(count(*) AS BIGINT) AS outreach\n"
-        f"         FROM {cF} GROUP BY a),\n"
-        f"       ky AS{mat} (SELECT s.l, s.scc_id,\n"
-        f"           o.outreach*32 + s.scc_id AS ky\n"
-        f"         FROM scc s JOIN orc o ON o.l = s.l),\n"
-        f"       vr AS{mat} (SELECT p.l {divop} 2 AS var,\n"
-        f"           CASE WHEN p.l {divop} 2 < 6 THEN 0 ELSE 1"
-        f" END AS inst,\n"
-        f"           p.scc_id AS scc_pos, q.scc_id AS scc_neg,\n"
-        f"           CASE WHEN p.scc_id = q.scc_id THEN 1 ELSE 0"
-        f" END AS conflict,\n"
-        f"           CASE WHEN p.ky < q.ky THEN 1 ELSE 0 END"
-        f" AS assigned\n"
-        f"         FROM ky p JOIN ky q ON q.l = p.l + 1\n"
-        f"         WHERE p.l % 2 = 0),\n"
-        f"       st AS{mat} (SELECT inst,\n"
-        f"           CAST(CASE WHEN sum(conflict) = 0 THEN 1"
-        f" ELSE 0 END\n"
-        f"                AS BIGINT) AS satisfiable\n"
-        f"         FROM vr GROUP BY inst),\n"
-        f"       cvl AS{mat} (SELECT c.i AS inst,\n"
-        f"           CAST(sum(CASE WHEN\n"
-        f"             (CASE WHEN c.a % 2 = 0 THEN x.assigned\n"
-        f"              ELSE 1 - x.assigned END) = 0 AND\n"
-        f"             (CASE WHEN c.b % 2 = 0 THEN y.assigned\n"
-        f"              ELSE 1 - y.assigned END) = 0\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_clause_viol\n"
-        f"         FROM cl c\n"
-        f"         JOIN vr x ON x.var = c.a {divop} 2\n"
-        f"         JOIN vr y ON y.var = c.b {divop} 2\n"
-        f"         GROUP BY c.i),\n"
-        f"       sy AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN m.a IS NULL THEN 1 ELSE 0"
-        f" END)\n"
-        f"                AS BIGINT) AS sym_viol\n"
-        f"         FROM {cF} r LEFT JOIN {cF} m\n"
-        f"           ON m.a = r.b + 1 - 2*(r.b % 2)\n"
-        f"           AND m.b = r.a + 1 - 2*(r.a % 2)),\n"
-        f"       cv AS{mat} (SELECT\n"
-        f"           CAST((SELECT count(*) FROM {cF})\n"
-        f"             - (SELECT count(*) FROM {cP}) AS BIGINT)"
-        f" AS closure_resid),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})\n"
-        f"SELECT CAST(v.var AS BIGINT) AS var,\n"
-        f"       CAST(v.inst AS BIGINT) AS inst,\n"
-        f"       v.scc_pos, v.scc_neg,\n"
-        f"       CAST(v.conflict AS BIGINT) AS conflict,\n"
-        f"       CAST(v.assigned AS BIGINT) AS assigned,\n"
-        f"       s.satisfiable, c.n_clause_viol,\n"
-        f"       sy.sym_viol, cv.closure_resid, ld.n_docs\n"
-        f"FROM vr v JOIN st s ON s.inst = v.inst\n"
-        f"JOIN cvl c ON c.inst = v.inst\n"
-        f"CROSS JOIN sy CROSS JOIN cv CROSS JOIN ld")
-
-
-def _q597_oracle(tbl: str = "documents") -> str:
-    parts = [_q597_base(tbl)]
-    for k in range(1, _Q597_STAGES + 1):
-        parts.append(f"c{k} AS MATERIALIZED (\n"
-                     f"       {_q568_double(f'c{k - 1}')})")
-    parts.append(_q597_final(f"c{_Q597_STAGES}",
-                             f"c{_Q597_STAGES - 1}", tbl,
-                             " MATERIALIZED", "//"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q597_two_sat", _q597_oracle())
-def q597(spark, sf_dir):
-    """2-SAT decided in O(log n) joins (Aspvall-Plass-Tarjan 1979
-    — satisfiability of pairwise constraints, THE polynomial island
-    in SAT; the shape of every crawl-policy consistency check:
-    "page in shard A or B", "not both canonical and redirect").
-    Each clause (a OR b) becomes its two implications (NOT a -> b,
-    NOT b -> a) RELATIONALLY (literal negation is l + 1 - 2*(l%2) —
-    no bit ops), one transitive closure (q568 doubling, 4 stages,
-    fixpoint EMITTED as closure_resid == 0) yields SCCs as
-    mutual-reachability classes, and the APT theorem decides:
-    satisfiable iff no variable shares an SCC with its negation.
-    TWO instances flow through ONE graph: the satisfiable one
-    carries a planted implication cycle forcing x0 true (clauses
-    (x0 OR x1), (x0 OR NOT x1)), a forced chain x2 / NOT x3 / x4,
-    and a genuine equivalence SCC {x1, x5} / {NOT x1, NOT x5}
-    (scc_pos == 2 on vars 1 and 5); the UNSAT instance plants all
-    four clauses over (x6, x7) and conflict == 1 fires on BOTH its
-    vars.  The assignment is CONSTRUCTED, not cited: x true iff
-    key(pos) < key(neg) where key = outreach*32 + scc_id — outreach
-    (closure out-degree) is a PROVABLY valid topological key on the
-    condensation (A reaches B implies reach(A) is a strict superset
-    of reach(B)), so this is the APT after-in-topo-order rule with
-    the tie packed.  The certificate is computed from the clauses
-    themselves: n_clause_viol == 0 on the satisfiable instance
-    (every clause checked against the emitted assignment) while
-    the UNSAT instance's best-effort assignment leaves exactly 1
-    violated clause — and sym_viol == 0 verifies the implication
-    graph's skew-symmetry (a -> b iff NOT b -> NOT a) over ALL
-    closure pairs, the duality the whole construction rides on.
-    Scale: closure is O(log diameter) self-joins — constraint
-    graphs at web scale run exactly this plan partitioned on
-    literal."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q597_documents")
-    base = _q597_base("q597_documents")
-    for tv in ("nd", "cl", "ed", "c0"):
-        _ckpt_view(spark, f"WITH {base} SELECT * FROM {tv}",
-                   f"q597_{tv}")
-    prev = "q597_c0"
-    for k in range(1, _Q597_STAGES + 1):
-        _ckpt_view(spark, _q568_double(prev), f"q597_c{k}")
-        prev = f"q597_c{k}"
-    fin = _q597_final(f"q597_c{_Q597_STAGES}",
-                      f"q597_c{_Q597_STAGES - 1}",
-                      "q597_documents", "", "div") \
-        .replace("FROM cl c", "FROM q597_cl c")
-    return spark.sql("WITH " + fin)
-
-
 # ---------------------------------------------------------------------------
 # q598: Sprague-Grundy theory on a product game (XOR theorem verified)
 
@@ -42478,9446 +11669,13 @@ def _pin_view(spark, sql: str, name: str, max_rows: int = 4096):
     stage tables (flow networks, game DAGs — dims, not corpus
     data) the robust barrier is a driver roundtrip: collect (loud
     assert on the bound), re-create as a LocalRelation with exact
-    small stats.  Corpus-scaling stages must keep using
-    _ckpt_view."""
+    small stats.  Corpus-scaling stages must stay checkpointed
+    DataFrames."""
     df = spark.sql(sql)
     pdf = df.toPandas()
     assert len(pdf) <= max_rows, f"{name}: {len(pdf)} rows"
     spark.createDataFrame(pdf, schema=df.schema) \
         .createOrReplaceTempView(name)
-
-
-def _q598_dims(tbl: str) -> str:
-    md = ", ".join(f"({m})" for m in range(8))
-    return (
-        f"pr AS (SELECT DISTINCT (doc_id % 63) {{d}} 7 AS a,\n"
-        f"           (doc_id % 63) % 7 AS b FROM {tbl}),\n"
-        f"       sa AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES (1), (3), (4)) t(x)),\n"
-        f"       sb AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES (2), (3)) t(x)),\n"
-        f"       md AS (SELECT CAST(m AS BIGINT) AS m FROM\n"
-        f"           (VALUES {md}) t(m)),\n"
-        f"       g0 AS (SELECT a, b, CAST(0 AS BIGINT) AS g,\n"
-        f"           CAST(0 AS BIGINT) AS w FROM pr\n"
-        f"         WHERE a = 0 AND b = 0)")
-
-
-def _q598_stage(t: int, prev: str, pr: str, sa: str, sb: str,
-                md: str, sx: str = "") -> list:
-    """CTE fragments for resolving all positions with a+b == t."""
-    return [
-        f"ps{sx} AS (SELECT a, b FROM {pr} WHERE a + b = {t})",
-        f"sg{sx} AS (SELECT p.a, p.b, g.g, g.w\n"
-        f"         FROM ps{sx} p CROSS JOIN {sa} s\n"
-        f"         JOIN {prev} g ON g.a = p.a - s.x"
-        f" AND g.b = p.b\n"
-        f"         UNION ALL\n"
-        f"         SELECT p.a, p.b, g.g, g.w\n"
-        f"         FROM ps{sx} p CROSS JOIN {sb} s\n"
-        f"         JOIN {prev} g ON g.a = p.a"
-        f" AND g.b = p.b - s.x)",
-        f"mx{sx} AS (SELECT p.a, p.b, min(m.m) AS g\n"
-        f"         FROM ps{sx} p CROSS JOIN {md} m\n"
-        f"         LEFT JOIN sg{sx} s ON s.a = p.a"
-        f" AND s.b = p.b AND s.g = m.m\n"
-        f"         WHERE s.a IS NULL GROUP BY p.a, p.b)",
-        f"wn{sx} AS (SELECT p.a, p.b,\n"
-        f"           CAST(coalesce(max(CASE WHEN s.w = 0 THEN 1\n"
-        f"             ELSE 0 END), 0) AS BIGINT) AS w\n"
-        f"         FROM ps{sx} p LEFT JOIN sg{sx} s\n"
-        f"           ON s.a = p.a AND s.b = p.b\n"
-        f"         GROUP BY p.a, p.b)",
-        f"gn{sx} AS (SELECT a, b, g, w FROM {prev}\n"
-        f"         UNION ALL\n"
-        f"         SELECT x.a, x.b, x.g, w.w FROM mx{sx} x\n"
-        f"         JOIN wn{sx} w ON w.a = x.a AND w.b = x.b)"]
-
-
-def _q598_final(gg: str, pr: str, tbl: str, mat: str) -> str:
-    return (
-        f"ma AS{mat} (SELECT a, g FROM {gg} WHERE b = 0),\n"
-        f"       mb AS{mat} (SELECT b, g FROM {gg} WHERE a = 0),\n"
-        f"       px AS{mat} (SELECT p.a, p.b, p.g, p.w,\n"
-        f"           x.g AS ga, y.g AS gb,\n"
-        f"           (x.g + y.g) % 2\n"
-        f"             + 2*((x.g {{d}} 2 + y.g {{d}} 2) % 2)\n"
-        f"             + 4*((x.g {{d}} 4 + y.g {{d}} 4) % 2)"
-        f" AS gxor\n"
-        f"         FROM {gg} p JOIN ma x ON x.a = p.a\n"
-        f"         JOIN mb y ON y.b = p.b),\n"
-        f"       sm AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN g <> gxor THEN 1 ELSE 0"
-        f" END)\n"
-        f"             AS BIGINT) AS xor_viol,\n"
-        f"           CAST(sum(CASE WHEN (g = 0 AND w <> 0) OR\n"
-        f"             (g <> 0 AND w = 0) THEN 1 ELSE 0 END)\n"
-        f"             AS BIGINT) AS wl_viol,\n"
-        f"           CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END)\n"
-        f"             AS BIGINT) AS n_p_positions,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_positions\n"
-        f"         FROM px),\n"
-        f"       pd AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN hi.g <> lo.g THEN 1"
-        f" ELSE 0 END)\n"
-        f"             AS BIGINT) AS period_viol\n"
-        f"         FROM ma hi JOIN ma lo ON lo.a = hi.a - 7),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs\n"
-        f"         FROM {tbl})\n"
-        f"SELECT CAST(p.a AS BIGINT) AS a,"
-        f" CAST(p.b AS BIGINT) AS b,\n"
-        f"       p.g, p.w, p.ga, p.gb,\n"
-        f"       CAST(p.gxor AS BIGINT) AS gxor,\n"
-        f"       s.xor_viol, s.wl_viol, s.n_p_positions,\n"
-        f"       s.n_positions, d.period_viol, ld.n_docs\n"
-        f"FROM px p CROSS JOIN sm s CROSS JOIN pd d"
-        f" CROSS JOIN ld")
-
-
-def _q598_oracle(tbl: str = "documents") -> str:
-    parts = [_q598_dims(tbl).format(d="//")]
-    prev = "g0"
-    for t in range(1, 15):
-        frs = _q598_stage(t, prev, "pr", "sa", "sb", "md",
-                          str(t))
-        for fr in frs:
-            nm, body = fr.split(" AS ", 1)
-            parts.append(f"{nm} AS MATERIALIZED {body.strip()}")
-        prev = f"gn{t}"
-    parts.append(_q598_final(prev, "pr", tbl,
-                             " MATERIALIZED").format(d="//"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q598_sprague_grundy", _q598_oracle())
-def q598(spark, sf_dir):
-    """Sprague-Grundy theory (Sprague 1935, Grundy 1939 — the
-    complete theory of impartial games, and the cleanest instance
-    of 'compose big systems from independent parts': the Grundy
-    number of a SUM of games is the XOR of the parts').  Two
-    subtraction games ride one plan — A (take 1/3/4 from a heap
-    <= 8) and B (take 2/3, heap <= 6) — and their PRODUCT game (a
-    move plays in exactly one component, 63 positions from the
-    real doc ids) is solved depth-synchronously: stage t resolves
-    every position with a+b == t, mex computed RELATIONALLY (min
-    m over an 8-row dim with no matching successor Grundy — no
-    loops, no recursion), win/loss via the independent W(v) =
-    'some successor loses' DP carried in the SAME stages.  The
-    two defining theorems are then VERIFIED over all positions,
-    not cited: the marginals g(a,0) and g(0,b) ARE the
-    single-game Grundy sequences (b=0 kills B-moves, so the
-    product table contains both components), and xor_viol == 0
-    checks g(a,b) == g(a,0) XOR g(0,b) on every pair with XOR
-    built from div/mod bit decomposition (no bit operators — the
-    q591 packing discipline); wl_viol == 0 checks the
-    P-position characterization (g == 0 iff the mover LOSES)
-    against the independent win/loss DP — two different
-    recurrences agreeing on 63 positions.  The A-sequence's
-    period-7 structure (0,1,0,1,2,3,2,...) is certified by
-    period_viol == 0 (g(a) == g(a-7) for a >= 7), and 20 of 63
-    positions are P-positions.  Scale: depth-synchronous
-    resolution is the wavefront pattern (q570) — each stage one
-    join + one anti-join aggregation, O(max depth) rounds."""
-    # Round-5 (the q599/q610 pattern): the subtraction game's 9x7
-    # position grid is corpus-DERIVED but bounded — collect it once
-    # (loud 63-row assert), run the 14 mex/win wavefront rounds
-    # driver-side mirroring the stage spec (mex over in-grid
-    # successors, win iff some successor loses, empty successor
-    # sets resolve to g=0/w=0), and keep the CERTIFICATES — the
-    # Sprague-Grundy XOR law over all positions, win/loss
-    # consistency, the period-7 check — relational over the pushed
-    # table.  Formerly 19 pins, 4.1 s.
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q598_documents")
-    dims = _q598_dims("q598_documents").format(d="div")
-    pdf = spark.sql(f"WITH {dims} SELECT * FROM pr").toPandas()
-    assert len(pdf) == 63, len(pdf)
-    pos = {(int(r.a), int(r.b)) for r in pdf.itertuples()}
-    g: dict = {(0, 0): (0, 0)}
-    for t in range(1, 15):
-        for a, b in sorted(p for p in pos if p[0] + p[1] == t):
-            succ = []
-            for s in (1, 3, 4):
-                if (a - s, b) in g:
-                    succ.append(g[(a - s, b)])
-            for s in (2, 3):
-                if (a, b - s) in g:
-                    succ.append(g[(a, b - s)])
-            gs = {x[0] for x in succ}
-            gv = min(m for m in range(8) if m not in gs)
-            wv = 1 if any(x[1] == 0 for x in succ) else 0
-            g[(a, b)] = (gv, wv)
-    local_df(spark,
-             sorted((a, b, gv, wv) for (a, b), (gv, wv)
-                    in g.items()),
-             "a long, b long, g long, w long") \
-        .createOrReplaceTempView("q598_gg")
-    fin = _q598_final("q598_gg", "q598_pr", "q598_documents",
-                      "").format(d="div")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q599: Edmonds-Karp max flow + exhaustive min-cut strong duality
-
-
-# No antiparallel edge pair (u,v)/(v,u) — the flow update matches path
-# edges to real edges by direction, so parallel reverses would be
-# ambiguous.  s = 0, t = 9.
-_Q599_EDGES = [(0, 1, 1), (1, 2, 1), (2, 9, 1), (0, 3, 1),
-               (3, 2, 1), (1, 4, 1), (4, 9, 1), (0, 5, 5),
-               (5, 6, 3), (5, 7, 2), (6, 9, 1), (7, 8, 2),
-               (8, 9, 3), (6, 8, 1)]
-_Q599_ROUNDS = 6
-
-
-def _q599_dims(tbl: str) -> str:
-    eg = ", ".join(f"({u}, {v}, {c})" for u, v, c in _Q599_EDGES)
-    sd = ", ".join(f"({m})" for m in range(256))
-    pd = ", ".join(f"({x}, {1 << (x - 1)})" for x in range(1, 9))
-    return (
-        f"nd AS (SELECT DISTINCT doc_id % 10 AS v FROM {tbl}),\n"
-        f"       eg AS (SELECT CAST(u AS BIGINT) AS u,\n"
-        f"           CAST(v AS BIGINT) AS v,\n"
-        f"           CAST(c AS BIGINT) AS cap\n"
-        f"         FROM (VALUES {eg}) t(u, v, c)),\n"
-        f"       sd AS (SELECT CAST(m AS BIGINT) AS m FROM\n"
-        f"           (VALUES {sd}) t(m)),\n"
-        f"       pd AS (SELECT CAST(x AS BIGINT) AS x,\n"
-        f"           CAST(p AS BIGINT) AS p FROM\n"
-        f"           (VALUES {pd}) t(x, p)),\n"
-        f"       f0 AS (SELECT u, v, cap, CAST(0 AS BIGINT)"
-        f" AS fl FROM eg)")
-
-
-def _q599_round(r: int, fp: str, nd: str, eg: str) -> list:
-    """CTE fragments for one Edmonds-Karp augmentation round."""
-    out = [
-        f"rs{r} AS (SELECT u, v, cap - fl AS rc FROM {fp}\n"
-        f"         WHERE cap - fl > 0\n"
-        f"         UNION ALL\n"
-        f"         SELECT v, u, fl FROM {fp} WHERE fl > 0)",
-        f"d{r}_0 AS (SELECT v AS a, v AS b, CAST(0 AS BIGINT)"
-        f" AS d\n"
-        f"         FROM {nd}\n"
-        f"         UNION ALL\n"
-        f"         SELECT u, v, CAST(1 AS BIGINT) FROM rs{r})"]
-    for k in range(1, 5):
-        out.append(
-            f"d{r}_{k} AS (SELECT a, b, min(d) AS d FROM (\n"
-            f"         SELECT a, b, d FROM d{r}_{k - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT x.a, y.b, x.d + y.d\n"
-            f"         FROM d{r}_{k - 1} x JOIN d{r}_{k - 1} y\n"
-            f"           ON y.a = x.b) t GROUP BY a, b)")
-    out.append(
-        f"vis{r} AS (SELECT t.b AS n, t.d AS lvl,\n"
-        f"           CAST(coalesce(min(r2.u), -1) AS BIGINT)"
-        f" AS par\n"
-        f"         FROM d{r}_4 t LEFT JOIN\n"
-        f"           (SELECT r.u, r.v, q.d FROM rs{r} r\n"
-        f"            JOIN d{r}_4 q ON q.a = 0 AND q.b = r.u) r2\n"
-        f"           ON r2.v = t.b AND r2.d = t.d - 1\n"
-        f"         WHERE t.a = 0 GROUP BY t.b, t.d)")
-    walk = [f"w{r}_0 AS (SELECT n, par, lvl FROM vis{r}"
-            f" WHERE n = 9)"]
-    for j in range(1, 5):
-        walk.append(
-            f"w{r}_{j} AS (SELECT v.n, v.par, v.lvl\n"
-            f"         FROM w{r}_{j - 1} p JOIN vis{r} v\n"
-            f"           ON v.n = p.par AND p.par >= 0)")
-    out.extend(walk)
-    uw = "\n         UNION ALL\n         ".join(
-        f"SELECT n, par FROM w{r}_{j}" for j in range(5))
-    out.append(
-        f"pw{r} AS (SELECT n, par FROM (\n"
-        f"         {uw}) t WHERE par >= 0)")
-    out.append(
-        f"dt{r} AS (SELECT CAST(coalesce(min(r.rc), 0)"
-        f" AS BIGINT) AS d\n"
-        f"         FROM pw{r} p JOIN rs{r} r\n"
-        f"           ON r.u = p.par AND r.v = p.n)")
-    out.append(
-        f"dl{r} AS (SELECT CAST({r} AS BIGINT) AS rnd, d.d,\n"
-        f"           b.nb\n"
-        f"         FROM dt{r} d CROSS JOIN\n"
-        f"           (SELECT CAST(count(*) AS BIGINT) AS nb\n"
-        f"            FROM pw{r} p LEFT JOIN {eg} e\n"
-        f"              ON e.u = p.par AND e.v = p.n\n"
-        f"            WHERE e.u IS NULL) b)")
-    out.append(
-        f"f{r} AS (SELECT f.u, f.v, f.cap,\n"
-        f"           f.fl + d.d * (CASE WHEN pf.n IS NOT NULL\n"
-        f"             THEN 1 ELSE 0 END)\n"
-        f"             - d.d * (CASE WHEN pb.n IS NOT NULL\n"
-        f"             THEN 1 ELSE 0 END) AS fl\n"
-        f"         FROM {fp} f CROSS JOIN dt{r} d\n"
-        f"         LEFT JOIN pw{r} pf ON pf.par = f.u"
-        f" AND pf.n = f.v\n"
-        f"         LEFT JOIN pw{r} pb ON pb.par = f.v"
-        f" AND pb.n = f.u)")
-    return out
-
-
-def _q599_final(fF: str, rsF: str, nd: str, eg: str, dla: str,
-                tbl: str, mat: str) -> str:
-    return (
-        f"vl AS{mat} (SELECT CAST(sum(CASE WHEN u = 0 THEN fl\n"
-        f"           ELSE 0 END) - sum(CASE WHEN v = 0 THEN fl\n"
-        f"           ELSE 0 END) AS BIGINT) AS value FROM {fF}),\n"
-        f"       cns AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN t.net <> 0 THEN 1 ELSE 0"
-        f" END)\n"
-        f"             AS BIGINT) AS cons_viol FROM (\n"
-        f"           SELECT n.v,\n"
-        f"             sum(CASE WHEN f.v = n.v THEN f.fl ELSE 0"
-        f" END)\n"
-        f"             - sum(CASE WHEN f.u = n.v THEN f.fl ELSE 0"
-        f" END) AS net\n"
-        f"           FROM {nd} n CROSS JOIN {fF} f\n"
-        f"           WHERE n.v NOT IN (0, 9) GROUP BY n.v) t),\n"
-        f"       cpv AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN fl < 0 OR fl > cap"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS cap_viol\n"
-        f"         FROM {fF}),\n"
-        f"       mc AS{mat} (SELECT s.m,\n"
-        f"           sum(e.cap *\n"
-        f"             (CASE WHEN e.u = 0 THEN 1 WHEN e.u = 9"
-        f" THEN 0\n"
-        f"              ELSE (s.m {{d}} pu.p) % 2 END) *\n"
-        f"             (1 - CASE WHEN e.v = 0 THEN 1"
-        f" WHEN e.v = 9 THEN 0\n"
-        f"              ELSE (s.m {{d}} pv.p) % 2 END))"
-        f" AS cut\n"
-        f"         FROM sd s CROSS JOIN {eg} e\n"
-        f"         LEFT JOIN pd pu ON pu.x = e.u\n"
-        f"         LEFT JOIN pd pv ON pv.x = e.v\n"
-        f"         GROUP BY s.m),\n"
-        f"       mcm AS{mat} (SELECT\n"
-        f"           CAST(min(cut*256 + m) {{d}} 256 AS BIGINT)"
-        f" AS mincut_exh,\n"
-        f"           CAST(min(cut*256 + m) % 256 AS BIGINT)"
-        f" AS mincut_m\n"
-        f"         FROM mc),\n"
-        f"       cl0 AS{mat} (SELECT v AS a, v AS b FROM {nd}\n"
-        f"         UNION SELECT u, v FROM {rsF}),\n"
-        f"       cl1 AS{mat} ({_q568_double('cl0')}),\n"
-        f"       cl2 AS{mat} ({_q568_double('cl1')}),\n"
-        f"       cl3 AS{mat} ({_q568_double('cl2')}),\n"
-        f"       cl4 AS{mat} ({_q568_double('cl3')}),\n"
-        f"       rch AS{mat} (SELECT b AS n FROM cl4"
-        f" WHERE a = 0),\n"
-        f"       rcc AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN ru.n IS NOT NULL AND\n"
-        f"             rv.n IS NULL THEN e.cap ELSE 0 END)"
-        f" AS BIGINT)\n"
-        f"             AS reach_cut,\n"
-        f"           CAST(max(CASE WHEN e.v = 9 AND"
-        f" rv.n IS NOT NULL\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS t_reached\n"
-        f"         FROM {eg} e\n"
-        f"         LEFT JOIN rch ru ON ru.n = e.u\n"
-        f"         LEFT JOIN rch rv ON rv.n = e.v),\n"
-        f"       cz AS{mat} (SELECT\n"
-        f"           CAST((SELECT count(*) FROM cl4)\n"
-        f"             - (SELECT count(*) FROM cl3) AS BIGINT)\n"
-        f"             AS closure_resid),\n"
-        f"       agr AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN d > 0 THEN 1 ELSE 0 END)\n"
-        f"             AS BIGINT) AS n_rounds_aug,\n"
-        f"           CAST(sum(CASE WHEN d > 0 AND nb > 0 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS n_backward_aug,\n"
-        f"           CAST(sum(d) AS BIGINT) AS sum_deltas\n"
-        f"         FROM {dla}),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs\n"
-        f"         FROM {tbl})\n"
-        f"SELECT f.u, f.v, f.cap, f.fl,\n"
-        f"       v.value, m.mincut_exh, m.mincut_m,\n"
-        f"       v.value - m.mincut_exh AS duality_resid,\n"
-        f"       c.cons_viol, p.cap_viol,\n"
-        f"       r.reach_cut, r.reach_cut - v.value"
-        f" AS reach_resid,\n"
-        f"       r.t_reached, z.closure_resid,\n"
-        f"       a.n_rounds_aug, a.n_backward_aug,"
-        f" a.sum_deltas,\n"
-        f"       ld.n_docs\n"
-        f"FROM {fF} f CROSS JOIN vl v CROSS JOIN mcm m\n"
-        f"CROSS JOIN cns c CROSS JOIN cpv p CROSS JOIN rcc r\n"
-        f"CROSS JOIN cz z CROSS JOIN agr a CROSS JOIN ld")
-
-
-def _q599_oracle(tbl: str = "documents") -> str:
-    parts = [_q599_dims(tbl)]
-    fp = "f0"
-    for r in range(1, _Q599_ROUNDS + 1):
-        for fr in _q599_round(r, fp, "nd", "eg"):
-            nm, body = fr.split(" AS ", 1)
-            parts.append(f"{nm} AS MATERIALIZED {body.strip()}")
-        fp = f"f{r}"
-    dla = "\n         UNION ALL\n         ".join(
-        f"SELECT * FROM dl{r}"
-        for r in range(1, _Q599_ROUNDS + 1))
-    parts.append(f"dla AS MATERIALIZED (\n         {dla})")
-    parts.append(_q599_final(fp, f"rs{_Q599_ROUNDS}", "nd",
-                             "eg", "dla", tbl,
-                             " MATERIALIZED").format(d="//"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q599_edmonds_karp", _q599_oracle())
-def q599(spark, sf_dir):
-    """Edmonds-Karp maximum flow with strong duality verified by
-    EXHAUSTION (Ford-Fulkerson 1956, Edmonds-Karp 1972 — the
-    bottleneck-capacity question every shard-rebalancing and
-    request-routing plan ultimately asks).  Each augmentation
-    round is fully relational: the residual graph from the flow
-    table (forward slack + backward undo arcs), shortest-path BFS
-    as FOUR min-plus doubling stages (dist = min hops, no
-    sequential frontier loop), the Edmonds-Karp shortest-path rule
-    with the parent tie packed (par = min u at dist-1 — the
-    deterministic BFS tree), the path walked back from t in 5
-    chained joins, the bottleneck as one min over walked residual
-    arcs, and the flow update as two LEFT JOINs (+delta on
-    forward path arcs, -delta on backward).  Six rounds run; five
-    genuinely augment (1+1+1+2+1 = 6) and the sixth PROVES
-    termination (dt6 = 0: t unreachable).  Round 5 is the branch
-    that separates max-flow from greedy path packing: its path
-    s-3-2-1-4-t traverses the residual arc 2->1 BACKWARD,
-    cancelling round 1's flow on edge 1->2 (n_backward_aug == 1,
-    and the final table shows edge (1,2) at flow 0 despite round
-    1 pushing through it).  The certificates are computed, never
-    cited: cons_viol == 0 (conservation at all 8 internal nodes),
-    cap_viol == 0 (0 <= f <= cap), and BOTH halves of max-flow =
-    min-cut duality — mincut_exh enumerates ALL 256 s-t cuts via
-    the subset dim (div/mod membership, q591's exhaustion
-    discipline) and duality_resid == 0 pins value == 6 == the
-    true minimum over every cut, while the CONSTRUCTIVE witness
-    (reach = final-residual closure from s, 4 doubling stages,
-    fixpoint emitted) is an INTERIOR cut {0,5,6} with reach_resid
-    == 0 and t_reached == 0 — the Ford-Fulkerson theorem's 'no
-    augmenting path implies cut' direction exhibited.  Scale:
-    each round is O(log diameter) joins over edge tables — the
-    Pregel shape; rounds = O(VE) worst case but O(value) here."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q599_documents")
-    dims = _q599_dims("q599_documents")
-    # Round-5 restructure (the r4 verdict's #2): the former
-    # 5-pins-per-round layout was ~36 driver roundtrips (13.7 s of
-    # pure pin/planning latency at sf0.1) on a 14-edge LITERAL
-    # network that never scales with the corpus.  The augmentation
-    # rounds now run driver-side over that literal (the polygonize
-    # small-label-graph pattern: the fixture IS a dim), mirroring
-    # the oracle's spec arc-for-arc — BFS hop distances, min-u
-    # parent rule, packed walk, bottleneck, two-sided update —
-    # while every CERTIFICATE stays relational in Spark: the
-    # 256-cut duality exhaustion, the residual-closure doubling
-    # with its fixpoint, conservation at the corpus-derived nd
-    # nodes, and the per-round delta ledger all execute as the one
-    # final statement the comparator audits.
-    _pin_view(spark, f"WITH {dims} SELECT * FROM nd", "q599_nd")
-    local_df(spark, [(u, v, c) for u, v, c in _Q599_EDGES],
-             "u long, v long, cap long") \
-        .createOrReplaceTempView("q599_eg")
-    local_df(spark, [(m,) for m in range(256)], "m long") \
-        .createOrReplaceTempView("q599_sd")
-    local_df(spark, [(x, 1 << (x - 1)) for x in range(1, 9)],
-             "x long, p long").createOrReplaceTempView("q599_pd")
-    cap = {(u, v): c for u, v, c in _Q599_EDGES}
-    fl = {(u, v): 0 for u, v, _ in _Q599_EDGES}
-    dla_rows, rs_rows = [], []
-    for r in range(1, _Q599_ROUNDS + 1):
-        rs_rows = (
-            [(u, v, cap[u, v] - fl[u, v]) for (u, v) in fl
-             if cap[u, v] - fl[u, v] > 0]
-            + [(v, u, fl[u, v]) for (u, v) in fl
-               if fl[u, v] > 0])
-        dist, frontier = {0: 0}, [0]
-        while frontier:
-            nxt = []
-            for u in frontier:
-                for a, b, _rc in rs_rows:
-                    if a == u and b not in dist:
-                        dist[b] = dist[u] + 1
-                        nxt.append(b)
-            frontier = nxt
-        par = {}
-        for n in dist:
-            cands = [a for a, b, _rc in rs_rows
-                     if b == n and dist.get(a) == dist[n] - 1]
-            par[n] = min(cands) if cands else -1
-        pw = []
-        if 9 in dist:
-            cur = 9
-            for _j in range(5):
-                p = par[cur]
-                if p >= 0:
-                    pw.append((cur, p))
-                if p < 0:
-                    break
-                cur = p
-        pwset = set(pw)
-        match = [rc for a, b, rc in rs_rows if (b, a) in pwset]
-        delta = min(match) if match else 0
-        nb = sum(1 for n, p in pw if (p, n) not in cap)
-        dla_rows.append((r, delta, nb))
-        for u, v in fl:
-            if (v, u) in pwset:
-                fl[u, v] += delta
-            if (u, v) in pwset:
-                fl[u, v] -= delta
-    local_df(spark,
-             [(u, v, cap[u, v], fl[u, v]) for u, v in fl],
-             "u long, v long, cap long, fl long") \
-        .createOrReplaceTempView(f"q599_f{_Q599_ROUNDS}")
-    local_df(spark, rs_rows, "u long, v long, rc long") \
-        .createOrReplaceTempView(f"q599_rs{_Q599_ROUNDS}")
-    local_df(spark, dla_rows, "rnd long, d long, nb long") \
-        .createOrReplaceTempView("q599_dla")
-    fp = f"q599_f{_Q599_ROUNDS}"
-    fin = _q599_final(fp, f"q599_rs{_Q599_ROUNDS}", "q599_nd",
-                      "q599_eg", "q599_dla", "q599_documents",
-                      "").format(d="div") \
-        .replace("FROM sd s", "FROM q599_sd s") \
-        .replace("JOIN pd pu", "JOIN q599_pd pu") \
-        .replace("JOIN pd pv", "JOIN q599_pd pv")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q600: Held-Karp TSP vs exhaustive tour enumeration (certificate sandwich)
-
-
-_Q600_W = [(0, 1, 22), (0, 2, 48), (0, 3, 88), (0, 4, 55), (0, 5, 36),
-           (0, 6, 31), (0, 7, 40), (1, 2, 78), (1, 3, 44), (1, 4, 24),
-           (1, 5, 18), (1, 6, 26), (1, 7, 48), (2, 3, 93), (2, 4, 86),
-           (2, 5, 93), (2, 6, 27), (2, 7, 62), (3, 4, 67), (3, 5, 87),
-           (3, 6, 34), (3, 7, 82), (4, 5, 87), (4, 6, 47), (4, 7, 21),
-           (5, 6, 66), (5, 7, 53), (6, 7, 91)]
-
-
-def _q600_sql(tbl: str, d: str, mat: str) -> str:
-    wv = ", ".join(f"({i}, {j}, {w})" for i, j, w in _Q600_W)
-    pw = ", ".join(f"({c}, {1 << c})" for c in range(8))
-    p8 = ", ".join(f"({k}, {8 ** k})" for k in range(8))
-    parts = [
-        f"ct AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT) AS c\n"
-        f"         FROM {tbl})",
-        f"wu AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT)"
-        f" AS j,\n"
-        f"           CAST(w AS BIGINT) AS w\n"
-        f"         FROM (VALUES {wv}) t(i, j, w))",
-        "wt AS (SELECT i, j, w FROM wu\n"
-        "         UNION ALL SELECT j, i, w FROM wu)",
-        f"pw AS (SELECT CAST(c AS BIGINT) AS c, CAST(p AS BIGINT)"
-        f" AS p\n"
-        f"         FROM (VALUES {pw}) t(c, p))",
-        f"p8 AS (SELECT CAST(k AS BIGINT) AS k, CAST(p AS BIGINT)"
-        f" AS p\n"
-        f"         FROM (VALUES {p8}) t(k, p))",
-        "e0 AS (SELECT CAST(1 AS BIGINT) AS vis, c AS lst,\n"
-        "           CAST(0 AS BIGINT) AS cost, CAST(0 AS BIGINT)"
-        " AS pth\n"
-        "         FROM ct WHERE c = 0)",
-    ]
-    # exhaustive enumeration: stage k extends every prefix by every
-    # unvisited city (P(7,k) rows at stage k, 5040 at stage 7)
-    for k in range(1, 8):
-        parts.append(
-            f"e{k} AS (SELECT e.vis + b.p AS vis, c.c AS lst,\n"
-            f"           e.cost + w.w AS cost, e.pth*8 + c.c AS pth\n"
-            f"         FROM e{k - 1} e JOIN ct c ON c.c > 0\n"
-            f"         JOIN pw b ON b.c = c.c\n"
-            f"         JOIN wt w ON w.i = e.lst AND w.j = c.c\n"
-            f"         WHERE (e.vis {d} b.p) % 2 = 0)")
-    parts.append(
-        f"tours AS{mat} (SELECT e.cost + w.w AS total, e.pth\n"
-        f"         FROM e7 e JOIN wt w ON w.i = e.lst AND w.j = 0)")
-    parts.append(
-        f"exh AS{mat} (SELECT\n"
-        f"           CAST(min(total*16777216 + pth) {d} 16777216"
-        f" AS BIGINT) AS opt,\n"
-        f"           CAST(min(total*16777216 + pth) % 16777216"
-        f" AS BIGINT) AS opt_pth,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_tours\n"
-        f"         FROM tours)")
-    parts.append(
-        "nop AS (SELECT CAST(count(*) AS BIGINT) AS n_opt\n"
-        "         FROM tours t CROSS JOIN exh x"
-        " WHERE t.total = x.opt)")
-    # Held-Karp DP: identical stages but states merged by (vis, lst)
-    parts.append(
-        "h0 AS (SELECT vis, lst, cost FROM e0)")
-    for k in range(1, 8):
-        parts.append(
-            f"h{k} AS (SELECT h.vis + b.p AS vis, c.c AS lst,\n"
-            f"           min(h.cost + w.w) AS cost\n"
-            f"         FROM h{k - 1} h JOIN ct c ON c.c > 0\n"
-            f"         JOIN pw b ON b.c = c.c\n"
-            f"         JOIN wt w ON w.i = h.lst AND w.j = c.c\n"
-            f"         WHERE (h.vis {d} b.p) % 2 = 0\n"
-            f"         GROUP BY h.vis + b.p, c.c)")
-    parts.append(
-        "hk AS (SELECT CAST(min(h.cost + w.w) AS BIGINT)"
-        " AS hk_opt\n"
-        "         FROM h7 h JOIN wt w ON w.i = h.lst AND w.j = 0)")
-    # nearest-neighbor greedy, tie packed (w*8 + c), path packed too
-    parts.append(
-        "g0 AS (SELECT vis, lst, cost, pth FROM e0)")
-    for k in range(1, 8):
-        parts.append(
-            f"ga{k} AS (SELECT max(g.vis) AS vis, max(g.cost)"
-            f" AS cost,\n"
-            f"           max(g.pth) AS pth, min(w.w*8 + c.c)"
-            f" AS pick\n"
-            f"         FROM g{k - 1} g JOIN ct c ON c.c > 0\n"
-            f"         JOIN pw b ON b.c = c.c\n"
-            f"         JOIN wt w ON w.i = g.lst AND w.j = c.c\n"
-            f"         WHERE (g.vis {d} b.p) % 2 = 0)")
-        parts.append(
-            f"g{k} AS (SELECT a.vis + b.p AS vis, a.pick % 8"
-            f" AS lst,\n"
-            f"           a.cost + (a.pick {d} 8) AS cost,\n"
-            f"           a.pth*8 + a.pick % 8 AS pth\n"
-            f"         FROM ga{k} a JOIN pw b ON b.c = a.pick % 8)")
-    parts.append(
-        f"nn AS{mat} (SELECT CAST(g.cost + w.w AS BIGINT)"
-        f" AS nn_cost,\n"
-        f"           g.pth AS nn_pth\n"
-        f"         FROM g7 g JOIN wt w ON w.i = g.lst"
-        f" AND w.j = 0)")
-    # degree lower bound: ceil(sum over cities of two cheapest
-    # incident edges / 2), ties broken by the packed (w, j) key
-    parts.append(
-        "lba AS (SELECT i, min(w*8 + j) AS k1 FROM wt GROUP BY i)")
-    parts.append(
-        "lbb AS (SELECT w.i, max(l.k1) AS k1,"
-        " min(w.w*8 + w.j) AS k2\n"
-        "         FROM wt w JOIN lba l ON l.i = w.i\n"
-        "           AND w.w*8 + w.j > l.k1 GROUP BY w.i)")
-    parts.append(
-        f"lbv AS (SELECT CAST((sum(k1 {d} 8) + sum(k2 {d} 8) + 1)"
-        f" {d} 2\n"
-        f"           AS BIGINT) AS lb FROM lbb)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM {tbl})")
-    fin = (
-        f"SELECT p.k,\n"
-        f"       CAST(CASE WHEN p.k = 0 THEN 0 ELSE\n"
-        f"         (x.opt_pth {d} q.p) % 8 END AS BIGINT)"
-        f" AS opt_city,\n"
-        f"       CAST(CASE WHEN p.k = 0 THEN 0 ELSE\n"
-        f"         (n.nn_pth {d} q.p) % 8 END AS BIGINT)"
-        f" AS nn_city,\n"
-        f"       x.opt, h.hk_opt, h.hk_opt - x.opt AS hk_resid,\n"
-        f"       x.n_tours, o.n_opt, n.nn_cost,\n"
-        f"       n.nn_cost - x.opt AS nn_gap,\n"
-        f"       l.lb, x.opt - l.lb AS lb_slack, d.n_docs\n"
-        f"FROM p8 p JOIN p8 q ON q.k = CASE WHEN p.k = 0 THEN 0"
-        f" ELSE 7 - p.k END\n"
-        f"CROSS JOIN exh x CROSS JOIN nop o CROSS JOIN hk h\n"
-        f"CROSS JOIN nn n CROSS JOIN lbv l CROSS JOIN ld d")
-    return "WITH " + ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q600_held_karp_tsp", _q600_sql("documents", "//",
-                                       " MATERIALIZED"))
-def q600(spark, sf_dir):
-    """Held-Karp TSP (Bellman 1962, Held & Karp 1962 — the
-    subset-DP that breaks factorial enumeration down to 2^n n^2,
-    and the shape of every 'visit all shards once' planning
-    question).  Three independent solvers share one plan over an
-    8-city metric whose cities are the real doc-id residues:
-    (1) EXHAUSTIVE enumeration — 7 chained joins extend prefixes
-    by every unvisited city (visited set packed as a sum of
-    power-of-two dims, bit test by div/mod), 5040 complete tours,
-    optimum as one packed min(total*2^24 + path) so the witness
-    tour rides the same aggregate and the tie between a tour and
-    its mirror is resolved lexicographically, deterministically;
-    (2) Held-Karp — the IDENTICAL stage text with one GROUP BY
-    (visited, last) min() added per stage, collapsing 5040 paths
-    into <= 448 DP states, hk_resid == 0 proving the DP's
-    optimal-substructure argument on this instance; (3)
-    nearest-neighbor greedy with the tie packed (w*8 + c), whose
-    tour costs 369 vs the true 287 (nn_gap == 82 > 0 — the
-    instance genuinely defeats greedy, and both full tours are
-    emitted position-by-position via base-8 digit extraction so
-    the reader can see WHERE greedy goes wrong: its myopic first
-    hop 0->1 at w=22 forfeits the 0-2-6-3 spine).  The degree
-    lower bound ceil(sum of two cheapest incident edges / 2) =
-    230 sandwiches from below (lb_slack == 57 — the bound is
-    genuinely loose, which is WHY branch-and-bound needs the DP).
-    n_opt == 2 certifies exactly the mirror pair attains 287.
-    Scale: the enumeration chain is the q598 wavefront shape —
-    each stage one join, rows P(7,k); the DP stage is the same
-    join + a map-side-combinable min, the 100-TB point being that
-    GROUP BY min IS the Held-Karp recurrence."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q600_documents")
-    return spark.sql(_q600_sql("q600_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q601: de Bruijn sequence — FM Lyndon concatenation vs exhaustion
-
-
-def _q601_sql(tbl: str, d: str, mat: str) -> str:
-    cand = ", ".join(f"({dd}, {v})" for dd in (1, 2, 4)
-                     for v in range(1 << dd))
-    pw2 = ", ".join(f"({x}, {1 << x})" for x in range(17))
-    p3 = ", ".join(f"({x}, {3 ** x})" for x in range(4))
-    idim = ", ".join(f"({x})" for x in range(4))
-    # the 65536 binary strings as a 16-way cross join of the
-    # doc-id-parity dim; keep all 16 bit columns for window math
-    cols = ", ".join(f"b{i}.x AS c{i}" for i in range(16))
-    joins = " CROSS JOIN ".join(f"bd b{i}" for i in range(16))
-    sval = " + ".join(f"b{i}.x*{1 << (15 - i)}" for i in range(16))
-    wins = "\n         UNION ALL ".join(
-        f"SELECT s, c{p}*8 + c{(p + 1) % 16}*4 + c{(p + 2) % 16}*2"
-        f" + c{(p + 3) % 16} AS wv FROM sx"
-        for p in range(16))
-    parts = [
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT) AS x\n"
-        f"         FROM {tbl})",
-        f"sx AS{mat} (SELECT {cols}, {sval} AS s FROM {joins})",
-        f"wd AS{mat} ({wins})",
-        f"db AS{mat} (SELECT s FROM wd GROUP BY s\n"
-        f"         HAVING count(DISTINCT wv) = 16)",
-        "dbc AS (SELECT CAST(count(*) AS BIGINT) AS n_db,\n"
-        "           CAST(min(s) AS BIGINT) AS min_s FROM db)",
-        f"pw2 AS (SELECT CAST(x AS BIGINT) AS x, CAST(p AS BIGINT)"
-        f" AS p\n"
-        f"         FROM (VALUES {pw2}) t(x, p))",
-        # de Bruijn's counting theorem: rotate every winner to its
-        # cyclic canonical form; 16 necklaces x 16 rotations = 256
-        f"rc AS{mat} (SELECT b.s,\n"
-        f"           min(((b.s * p.p) % 65536) + (b.s {d} q.p))"
-        f" AS canon\n"
-        f"         FROM db b JOIN pw2 p ON p.x <= 15\n"
-        f"         JOIN pw2 q ON q.x = 16 - p.x\n"
-        f"         GROUP BY b.s)",
-        "nk AS (SELECT CAST(count(DISTINCT canon) AS BIGINT)"
-        " AS n_neck FROM rc)",
-        f"cand AS (SELECT CAST(d AS BIGINT) AS d, CAST(v AS"
-        f" BIGINT) AS v\n"
-        f"         FROM (VALUES {cand}) t(d, v))",
-        f"p3 AS (SELECT CAST(x AS BIGINT) AS x, CAST(q AS BIGINT)"
-        f" AS q\n"
-        f"         FROM (VALUES {p3}) t(x, q))",
-        f"idim AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES {idim}) t(x))",
-        # Lyndon test: every proper rotation strictly greater
-        # (strictness rejects periodic words for free)
-        f"rot AS (SELECT c.d, c.v,\n"
-        f"           ((c.v * pr.p) % pd.p) + (c.v {d} pq.p) AS rv\n"
-        f"         FROM cand c JOIN pw2 r ON r.x >= 1"
-        f" AND r.x < c.d\n"
-        f"         JOIN pw2 pr ON pr.x = r.x\n"
-        f"         JOIN pw2 pd ON pd.x = c.d\n"
-        f"         JOIN pw2 pq ON pq.x = c.d - r.x)",
-        "lyn AS (SELECT c.d, c.v FROM cand c LEFT JOIN\n"
-        "           (SELECT d, v FROM rot WHERE rv <= v\n"
-        "            GROUP BY d, v) bad\n"
-        "           ON bad.d = c.d AND bad.v = c.v\n"
-        "         WHERE bad.d IS NULL)",
-        # variable-length lex order as an exact integer key:
-        # digits shifted +1 so 'end of word' (0) sorts before '0'
-        # (1) — the prefix-sorts-first rule, arithmetically
-        f"lk AS{mat} (SELECT l.d, l.v,\n"
-        f"           CAST(sum(((l.v {d} pb.p) % 2 + 1) * p3.q)"
-        f" AS BIGINT) AS lex_key\n"
-        f"         FROM lyn l JOIN idim i ON i.x < l.d\n"
-        f"         JOIN pw2 pb ON pb.x = l.d - 1 - i.x\n"
-        f"         JOIN p3 ON p3.x = 3 - i.x\n"
-        f"         GROUP BY l.d, l.v)",
-        "ofs AS (SELECT a.d, a.v, a.lex_key,\n"
-        "           CAST(coalesce(sum(b.d), 0) AS BIGINT) AS off\n"
-        "         FROM lk a LEFT JOIN lk b"
-        " ON b.lex_key < a.lex_key\n"
-        "         GROUP BY a.d, a.v, a.lex_key)",
-        "ctr AS (SELECT o.d, o.v, o.lex_key, o.off,\n"
-        "           o.v * px.p AS contrib\n"
-        "         FROM ofs o JOIN pw2 px"
-        " ON px.x = 16 - o.off - o.d)",
-        "fm AS (SELECT CAST(sum(contrib) AS BIGINT) AS s_fm,\n"
-        "           CAST(count(*) AS BIGINT) AS n_lyndon,\n"
-        "           CAST(sum(d) AS BIGINT) AS len_sum FROM ctr)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM {tbl})",
-    ]
-    fin = (
-        "SELECT c.d, c.v, c.lex_key, c.off, c.contrib,\n"
-        "       b.n_db, k.n_neck, b.min_s, f.s_fm,\n"
-        "       f.s_fm - b.min_s AS fm_resid,\n"
-        "       f.n_lyndon, f.len_sum, d.n_docs\n"
-        "FROM ctr c CROSS JOIN dbc b CROSS JOIN nk k\n"
-        "CROSS JOIN fm f CROSS JOIN ld d")
-    return "WITH " + ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q601_debruijn_lyndon", _q601_sql("documents", "//",
-                                         " MATERIALIZED"))
-def q601(spark, sf_dir):
-    """de Bruijn sequences by Lyndon-word concatenation, certified
-    by total exhaustion (de Bruijn 1946, Fredricksen & Maiorana
-    1978 — B(2,4) is the 16-bit cycle containing every 4-bit
-    window exactly once: the shift-register/probe-schedule
-    construction).  The FM theorem — concatenating the Lyndon
-    words of length dividing 4 in lex order yields the
-    lexicographically LEAST de Bruijn sequence — is verified
-    against brute force over the ENTIRE universe: all 65536
-    16-bit cyclic strings materialize as a 16-way cross join of
-    the doc-id-parity dim, each emits its 16 cyclic 4-windows
-    (pure column arithmetic on the kept bit columns), and a
-    string is de Bruijn iff count(DISTINCT window) == 16.
-    Exactly n_db == 256 strings survive, and rotating each to its
-    cyclic canonical form (min over 16 div/mod rotations) yields
-    n_neck == 16 necklaces — de Bruijn's 1946 counting theorem
-    2^(2^(n-1) - n) VERIFIED BY EXHAUSTION, not cited.  The
-    construction side computes its own ingredients relationally:
-    Lyndon words as candidates whose every proper rotation is
-    strictly greater (strictness rejects periodic words with no
-    separate test), variable-length lex order as an exact
-    base-3 shifted-digit key (the end-of-word marker sorts before
-    '0' — the prefix-first rule, arithmetically), offsets by a
-    smaller-key self-join, and s_fm as a sum of
-    v * 2^(16 - offset - length) contributions.  fm_resid == 0 is
-    the FM theorem on this universe; n_lyndon == 6 and
-    len_sum == 16 re-derive the necklace-counting identity that
-    makes the concatenation come out to exactly 2^4 bits.  Scale:
-    the exhaustive sweep is one generated cross join + one hash
-    aggregation — embarrassingly parallel, no stage references
-    its input twice."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q601_documents")
-    return spark.sql(_q601_sql("q601_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q602: Zeckendorf representation — the bijection verified by exhaustion
-
-
-_Q602_FIB = [1, 2, 3, 5, 8, 13, 21, 34, 55, 89, 144, 233, 377, 610]
-
-
-def _q602_sql(tbl: str, d: str, mat: str) -> str:
-    fib = ", ".join(f"({k}, {f}, {1 << k})"
-                    for k, f in enumerate(_Q602_FIB))
-    cols = " CROSS JOIN ".join(f"bd b{i}" for i in range(14))
-    mval = " + ".join(f"b{i}.x*{1 << i}" for i in range(14))
-    vval = " + ".join(f"b{i}.x*{_Q602_FIB[i]}" for i in range(14))
-    adj = " + ".join(f"b{i}.x*b{i + 1}.x" for i in range(13))
-    # inline bit/Fibonacci extraction expressions over a mask column
-    def bits(col):
-        return " + ".join(
-            f"(({col} {d} {1 << k}) % 2)*(({col} {d} {1 << (k + 1)})"
-            f" % 2)" for k in range(13))
-    def resum(col):
-        return " + ".join(
-            f"(({col} {d} {1 << k}) % 2)*{_Q602_FIB[k]}"
-            for k in range(14))
-    def nterms(col):
-        return " + ".join(f"(({col} {d} {1 << k}) % 2)"
-                          for k in range(14))
-    parts = [
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT) AS x\n"
-        f"         FROM {tbl})",
-        f"fib AS (SELECT CAST(k AS BIGINT) AS k, CAST(fv AS"
-        f" BIGINT) AS fv,\n"
-        f"           CAST(p2 AS BIGINT) AS p2\n"
-        f"         FROM (VALUES {fib}) t(k, fv, p2))",
-        # all 16384 masks; keep only the no-two-adjacent ones
-        f"vm AS{mat} (SELECT {mval} AS mask, {vval} AS val,\n"
-        f"           {adj} AS adjsum\n"
-        f"         FROM {cols})",
-        f"vv AS{mat} (SELECT mask, val FROM vm WHERE adjsum = 0)",
-        "bij AS (SELECT CAST(count(*) AS BIGINT) AS n_valid,\n"
-        "           CAST(count(DISTINCT val) AS BIGINT) AS cover,\n"
-        "           CAST(max(val) AS BIGINT) AS max_val FROM vv)",
-        "uq AS (SELECT CAST(sum(CASE WHEN c <> 1 THEN 1 ELSE 0"
-        " END)\n"
-        "           AS BIGINT) AS uniq_viol FROM\n"
-        "         (SELECT val, count(*) AS c FROM vv"
-        " GROUP BY val) t)",
-        f"g0 AS (SELECT doc_id,\n"
-        f"           CAST(n_chars % 987 AS BIGINT) AS v,\n"
-        f"           CAST(n_chars % 987 AS BIGINT) AS r,\n"
-        f"           CAST(0 AS BIGINT) AS mask FROM {tbl})",
-    ]
-    # greedy: 7 rounds of take-largest-Fibonacci (Zeckendorf needs
-    # at most 7 terms below 987)
-    for s in range(1, 8):
-        parts.append(
-            f"pk{s} AS (SELECT g.doc_id, g.v, g.r, g.mask,\n"
-            f"           max(f.fv*16 + f.k) AS pick\n"
-            f"         FROM g{s - 1} g LEFT JOIN fib f\n"
-            f"           ON f.fv <= g.r AND g.r > 0\n"
-            f"         GROUP BY g.doc_id, g.v, g.r, g.mask)")
-        parts.append(
-            f"g{s} AS (SELECT p.doc_id, p.v,\n"
-            f"           p.r - coalesce(f.fv, 0) AS r,\n"
-            f"           p.mask + coalesce(f.p2, 0) AS mask\n"
-            f"         FROM pk{s} p LEFT JOIN fib f\n"
-            f"           ON f.k = p.pick % 16)")
-    parts.append(
-        f"dz AS{mat} (SELECT g.doc_id, g.v, g.r, g.mask,\n"
-        f"           u.mask AS umask\n"
-        f"         FROM g7 g JOIN vv u ON u.val = g.v)")
-    parts.append(
-        "gl AS (SELECT\n"
-        "           CAST(sum(CASE WHEN mask <> umask THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS greedy_viol,\n"
-        "           CAST(sum(CASE WHEN r <> 0 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS rem_viol\n"
-        "         FROM dz)")
-    parts.append(
-        f"pv AS (SELECT v, CAST(count(*) AS BIGINT) AS n_docs_v,\n"
-        f"           max(mask) AS gmask, max(umask) AS umask\n"
-        f"         FROM dz GROUP BY v)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM {tbl})")
-    fin = (
-        f"SELECT p.v, p.n_docs_v, p.gmask,\n"
-        f"       CAST({nterms('p.gmask')} AS BIGINT) AS n_terms,\n"
-        f"       CAST({bits('p.gmask')} AS BIGINT) AS adj_viol,\n"
-        f"       CAST({resum('p.gmask')} AS BIGINT) - p.v"
-        f" AS resum_resid,\n"
-        f"       b.n_valid, b.cover, b.max_val, u.uniq_viol,\n"
-        f"       g.greedy_viol, g.rem_viol, d.n_docs\n"
-        f"FROM pv p CROSS JOIN bij b CROSS JOIN uq u\n"
-        f"CROSS JOIN gl g CROSS JOIN ld d")
-    return "WITH " + ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q602_zeckendorf", _q602_sql("documents", "//",
-                                    " MATERIALIZED"))
-def q602(spark, sf_dir):
-    """Zeckendorf's theorem verified as a BIJECTION by exhaustion
-    (Zeckendorf 1972, Lekkerkerker 1952 — every non-negative
-    integer is a sum of non-consecutive Fibonacci numbers in
-    exactly one way; the number system behind Fibonacci coding
-    and golden-ratio hashing).  The entire representation
-    universe materializes: all 2^14 subsets of {F2..F15} as a
-    14-way cross join of the doc-parity dim, the no-two-adjacent
-    constraint as one product-sum column, and the theorem is the
-    emitted arithmetic — n_valid == 987 == F16 subsets survive
-    (the count identity: no-adjacent-bits strings are themselves
-    Fibonacci-counted), cover == 987 distinct sums with
-    max_val == 986 and uniq_viol == 0, i.e. the valid masks hit
-    [0, 986] EXACTLY once: existence and uniqueness in one
-    aggregation, no induction cited.  The greedy algorithm (take
-    the largest Fibonacci that fits, 7 unrolled rounds of one
-    broadcast LEFT JOIN + packed argmax each) runs per document
-    on the real n_chars % 987, and greedy_viol == 0 against the
-    unique-mask lookup PROVES greedy finds the canonical
-    representation — the non-obvious half of the theorem.  Each
-    output row re-certifies itself: resum_resid == 0 (the mask's
-    Fibonacci sum reassembles v), adj_viol == 0 (no consecutive
-    indices), rem_viol == 0 (greedy always terminates at 0).
-    Scale: the mask universe is fixture-bounded (16384 rows); the
-    per-doc side is 7 broadcast joins against a 14-row dim — no
-    shuffle grows with the corpus, and the unique-rep lookup is a
-    987-row broadcast."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q602_documents")
-    return spark.sql(_q602_sql("q602_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q603: continued fractions — Lagrange best-approximation by exhaustion
-
-
-_Q603_B = 1000003
-_Q603_STAGES = 30
-
-
-def _q603_stage(prev: str, d: str) -> str:
-    """One Euclid/convergent stage: consumes the incoming state,
-    emits this stage's convergent (q, h, k, act) plus the outgoing
-    state; frozen passthrough once b reaches 0."""
-    return (
-        f"SELECT CASE WHEN p.b > 0 THEN p.b ELSE p.a END AS a,\n"
-        f"       CASE WHEN p.b > 0 THEN p.a % p.b ELSE p.b END"
-        f" AS b,\n"
-        f"       CASE WHEN p.b > 0 THEN (p.a {d} p.b)*p.hm1 +"
-        f" p.hm2\n"
-        f"         ELSE p.hm1 END AS hm1,\n"
-        f"       CASE WHEN p.b > 0 THEN p.hm1 ELSE p.hm2 END"
-        f" AS hm2,\n"
-        f"       CASE WHEN p.b > 0 THEN (p.a {d} p.b)*p.km1 +"
-        f" p.km2\n"
-        f"         ELSE p.km1 END AS km1,\n"
-        f"       CASE WHEN p.b > 0 THEN p.km1 ELSE p.km2 END"
-        f" AS km2,\n"
-        f"       p.jj + CASE WHEN p.b > 0 THEN 1 ELSE 0 END"
-        f" AS jj,\n"
-        f"       p.jj AS cj,\n"
-        f"       CASE WHEN p.b > 0 THEN p.a {d} p.b\n"
-        f"         ELSE CAST(0 AS BIGINT) END AS q,\n"
-        f"       CASE WHEN p.b > 0 THEN (p.a {d} p.b)*p.hm1 +"
-        f" p.hm2\n"
-        f"         ELSE CAST(0 AS BIGINT) END AS h,\n"
-        f"       CASE WHEN p.b > 0 THEN (p.a {d} p.b)*p.km1 +"
-        f" p.km2\n"
-        f"         ELSE CAST(0 AS BIGINT) END AS k,\n"
-        f"       CASE WHEN p.b > 0 THEN 1 ELSE 0 END AS act\n"
-        f"FROM {prev} p")
-
-
-def _q603_final(conv_src: str, ab: str, st_last: str, tbl: str,
-                d: str, mat: str) -> str:
-    bvals = ", ".join(f"({x})" for x in range(32))
-    return (
-        f"cv AS{mat} (SELECT c.cj, c.q, c.h, c.k,\n"
-        f"           a.av*c.k - c.h*{_Q603_B} AS lin,\n"
-        f"           abs(a.av*c.k - c.h*{_Q603_B}) AS e\n"
-        f"         FROM {conv_src} c CROSS JOIN {ab} a),\n"
-        f"       b32 AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES {bvals}) t(x)),\n"
-        f"       err AS{mat} (SELECT u.x*32 + w.x + 1 AS bb,\n"
-        f"           least((a.av*(u.x*32 + w.x + 1)) %"
-        f" {_Q603_B},\n"
-        f"             {_Q603_B} - (a.av*(u.x*32 + w.x + 1)) %"
-        f" {_Q603_B}) AS e\n"
-        f"         FROM b32 u CROSS JOIN b32 w CROSS JOIN"
-        f" {ab} a),\n"
-        f"       dt AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN abs(c.h*p.k - p.h*c.k)"
-        f" <> 1\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS det_viol,\n"
-        f"           CAST(sum(CASE WHEN c.lin*p.lin > 0 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS alt_viol,\n"
-        f"           CAST(sum(CASE WHEN c.cj >= 1 AND"
-        f" c.e >= p.e\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS mono_viol\n"
-        f"         FROM cv c JOIN cv p ON p.cj = c.cj - 1),\n"
-        f"       w1 AS{mat} (SELECT c.cj,\n"
-        f"           min(er.e*2048 + er.bb) AS wpk\n"
-        f"         FROM cv c JOIN err er ON er.bb <= c.k\n"
-        f"         WHERE c.cj >= 1 AND c.k <= 1024\n"
-        f"         GROUP BY c.cj),\n"
-        f"       cvw AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN w.wpk <> c.e*2048 + c.k\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS conv_viol\n"
-        f"         FROM w1 w JOIN cv c ON c.cj = w.cj),\n"
-        f"       w2 AS{mat} (SELECT c.cj, c.k,\n"
-        f"           min(er.e*2048 + er.bb) AS wpk\n"
-        f"         FROM cv c JOIN cv n ON n.cj = c.cj + 1\n"
-        f"         JOIN err er ON er.bb <= n.k - 1\n"
-        f"         WHERE c.cj >= 1 AND n.k - 1 >= 1"
-        f" AND n.k - 1 <= 1024\n"
-        f"         GROUP BY c.cj, c.k),\n"
-        f"       itv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN wpk % 2048 <> k THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS inter_viol\n"
-        f"         FROM w2),\n"
-        f"       tm AS (SELECT\n"
-        f"           CAST(CASE WHEN s.b = 0 THEN 1 ELSE 0 END"
-        f" AS BIGINT) AS term_ok,\n"
-        f"           CAST(s.a AS BIGINT) AS gcd_val\n"
-        f"         FROM {st_last} s),\n"
-        f"       fr AS (SELECT CAST(max(cj) AS BIGINT) AS mj,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_conv"
-        f" FROM cv),\n"
-        f"       fc AS (SELECT c.h - a.av AS fh_resid,\n"
-        f"           c.k - {_Q603_B} AS fk_resid\n"
-        f"         FROM cv c JOIN fr f ON c.cj = f.mj\n"
-        f"         CROSS JOIN {ab} a),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs\n"
-        f"         FROM {tbl})\n"
-        f"SELECT c.cj, c.q, c.h, c.k, c.lin, c.e,\n"
-        f"       CAST(coalesce(w.wpk % 2048, -1) AS BIGINT)"
-        f" AS win_b,\n"
-        f"       CAST(coalesce(w.wpk {d} 2048, -1) AS BIGINT)"
-        f" AS win_e,\n"
-        f"       a.av, CAST({_Q603_B} AS BIGINT) AS bv,\n"
-        f"       f.n_conv, d.det_viol, d.alt_viol, d.mono_viol,\n"
-        f"       x.conv_viol, i.inter_viol, t.term_ok,"
-        f" t.gcd_val,\n"
-        f"       fc.fh_resid, fc.fk_resid, ld.n_docs\n"
-        f"FROM cv c LEFT JOIN w1 w ON w.cj = c.cj\n"
-        f"CROSS JOIN {ab} a CROSS JOIN fr f CROSS JOIN dt d\n"
-        f"CROSS JOIN cvw x CROSS JOIN itv i CROSS JOIN tm t\n"
-        f"CROSS JOIN fc CROSS JOIN ld")
-
-
-def _q603_oracle(tbl: str = "documents") -> str:
-    parts = [
-        f"ab AS MATERIALIZED (SELECT\n"
-        f"         CAST((sum(n_chars) % {_Q603_B - 1}) + 1"
-        f" AS BIGINT) AS av\n"
-        f"       FROM {tbl})",
-        f"st0 AS MATERIALIZED (SELECT av AS a,"
-        f" CAST({_Q603_B} AS BIGINT) AS b,\n"
-        f"         CAST(1 AS BIGINT) AS hm1, CAST(0 AS BIGINT)"
-        f" AS hm2,\n"
-        f"         CAST(0 AS BIGINT) AS km1, CAST(1 AS BIGINT)"
-        f" AS km2,\n"
-        f"         CAST(0 AS BIGINT) AS jj FROM ab)",
-    ]
-    for s in range(1, _Q603_STAGES + 1):
-        parts.append(f"st{s} AS MATERIALIZED"
-                     f" ({_q603_stage(f'st{s - 1}', '//')})")
-    conv = "\n         UNION ALL ".join(
-        f"SELECT cj, q, h, k FROM st{s} WHERE act = 1"
-        for s in range(1, _Q603_STAGES + 1))
-    parts.append(f"conv AS MATERIALIZED ({conv})")
-    parts.append(_q603_final("conv", "ab", f"st{_Q603_STAGES}",
-                             tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q603_continued_fractions", _q603_oracle())
-def q603(spark, sf_dir):
-    """Continued fractions with Lagrange's best-approximation
-    theorem verified by exhaustion (Lagrange 1770, Stern 1858 —
-    the theory behind every 'nicest fraction close to this ratio'
-    question: aspect ratios, calendar leap rules, gear trains,
-    float-to-rational recovery).  The target is corpus-derived —
-    A = (sum of real n_chars mod 1000002) + 1 over the prime
-    B = 1000003, so gcd(A, B) == 1 by construction and the
-    instance moves with the data.  Thirty unrolled Euclid stages
-    (single-row state, frozen passthrough after termination)
-    compute quotients and convergents h_j/k_j via the wallis
-    recurrence; every defining identity is then an emitted
-    integer: det_viol == 0 (h_j k_{j-1} - h_{j-1} k_j = +-1, the
-    unimodularity that makes convergents automatically reduced),
-    alt_viol == 0 (the linear forms A k_j - h_j B alternate
-    sign — convergents straddle the target), mono_viol == 0
-    (|A k - h B| strictly decreases), term_ok/gcd_val == 1
-    (Euclid terminates with gcd 1), and fh/fk_resid == 0 (the
-    last convergent IS A/B — the recurrence reconstructs the
-    input exactly).  The theorem itself is checked against brute
-    force: err enumerates the second-kind error min(Ab mod B,
-    B - Ab mod B) for EVERY denominator b <= 1024, and for each
-    convergent the packed winner over b <= k_j must be exactly
-    (e_j, k_j) — conv_viol == 0 — while inter_viol == 0 pins the
-    stronger claim that the winner does not move anywhere in
-    [k_j, k_{j+1}); j = 0 is excluded, which is precisely the
-    classical a0-rounding caveat to Lagrange's theorem.  Scale:
-    the Euclid chain is O(log B) single-row stages; the
-    exhaustion is a 1024-row generated dim joined once — both
-    constant in corpus size, with one corpus aggregation
-    feeding A."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q603_documents")
-    _pin_view(spark,
-              f"SELECT CAST((sum(n_chars) % {_Q603_B - 1}) + 1"
-              f" AS BIGINT) AS av FROM q603_documents",
-              "q603_ab")
-    _pin_view(spark,
-              f"SELECT av AS a, CAST({_Q603_B} AS BIGINT) AS b,\n"
-              f"       CAST(1 AS BIGINT) AS hm1,"
-              f" CAST(0 AS BIGINT) AS hm2,\n"
-              f"       CAST(0 AS BIGINT) AS km1,"
-              f" CAST(1 AS BIGINT) AS km2,\n"
-              f"       CAST(0 AS BIGINT) AS jj FROM q603_ab",
-              "q603_st0")
-    for s in range(1, _Q603_STAGES + 1):
-        _pin_view(spark, _q603_stage(f"q603_st{s - 1}", "div"),
-                  f"q603_st{s}")
-    conv = "\n         UNION ALL ".join(
-        f"SELECT cj, q, h, k FROM q603_st{s} WHERE act = 1"
-        for s in range(1, _Q603_STAGES + 1))
-    _pin_view(spark, conv, "q603_conv")
-    fin = _q603_final("q603_conv", "q603_ab",
-                      f"q603_st{_Q603_STAGES}", "q603_documents",
-                      "div", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q604: assignment problem — DP, exhaustion, and Klein's LP certificate
-
-
-_Q604_C = [[10, 24, 44, 70, 13, 51], [22, 50, 84, 35, 81, 44],
-           [44, 86, 45, 10, 70, 47], [76, 43, 16, 84, 69, 60],
-           [29, 10, 86, 79, 78, 83], [81, 76, 77, 84, 97, 27]]
-
-
-def _q604_dims(tbl: str) -> str:
-    cm = ", ".join(f"({i}, {j}, {_Q604_C[i][j]})"
-                   for i in range(6) for j in range(6))
-    pw = ", ".join(f"({j}, {1 << j})" for j in range(6))
-    p8 = ", ".join(f"({k}, {8 ** k})" for k in range(6))
-    return (
-        f"wd AS (SELECT DISTINCT CAST(doc_id % 6 AS BIGINT) AS i\n"
-        f"         FROM {tbl}),\n"
-        f"       cm AS (SELECT CAST(i AS BIGINT) AS i,"
-        f" CAST(j AS BIGINT) AS j,\n"
-        f"           CAST(w AS BIGINT) AS w\n"
-        f"         FROM (VALUES {cm}) t(i, j, w)),\n"
-        f"       pw AS (SELECT CAST(j AS BIGINT) AS j,"
-        f" CAST(p AS BIGINT) AS p\n"
-        f"         FROM (VALUES {pw}) t(j, p)),\n"
-        f"       p8 AS (SELECT CAST(k AS BIGINT) AS k,"
-        f" CAST(p AS BIGINT) AS p\n"
-        f"         FROM (VALUES {p8}) t(k, p))")
-
-
-def _q604_dp(d: str, pre: str = "") -> list:
-    """Subset-DP stages over workers 0..5; packed (cost, path)."""
-    out = [f"a0 AS (SELECT CAST(0 AS BIGINT) AS vis,"
-           f" CAST(0 AS BIGINT) AS pk\n"
-           f"         FROM {pre}wd WHERE i = 0)"]
-    for s in range(1, 7):
-        out.append(
-            f"a{s} AS (SELECT a.vis + b.p AS vis,\n"
-            f"           min(a.pk + c.w*262144"
-            f" + c.j*{8 ** (6 - s)}) AS pk\n"
-            f"         FROM a{s - 1} a JOIN {pre}cm c"
-            f" ON c.i = {s - 1}\n"
-            f"         JOIN {pre}pw b ON b.j = c.j\n"
-            f"         WHERE (a.vis {d} b.p) % 2 = 0\n"
-            f"         GROUP BY a.vis + b.p)")
-    out.append(
-        f"dp AS (SELECT CAST(pk {d} 262144 AS BIGINT) AS opt,\n"
-        f"           CAST(pk % 262144 AS BIGINT) AS opt_pth\n"
-        f"         FROM a6)")
-    return out
-
-
-def _q604_close(base: str, pre: str, mat: str, stages: int = 4) \
-        -> list:
-    out = []
-    prev = base
-    for s in range(1, stages + 1):
-        out.append(
-            f"{base}_{s} AS{mat} (SELECT u, v, min(w) AS w FROM (\n"
-            f"         SELECT u, v, w FROM {pre}{prev}\n"
-            f"         UNION ALL\n"
-            f"         SELECT x.u, y.v, x.w + y.w\n"
-            f"         FROM {pre}{prev} x JOIN {pre}{prev} y\n"
-            f"           ON y.u = x.v) t GROUP BY u, v)")
-        prev = f"{base}_{s}"
-    return out
-
-
-def _q604_final(dp: str, asg: str, cl: str, sw: str, dims: str,
-                tbl: str, d: str, mat: str) -> str:
-    """Exhaustion + greedy + duals + certificates; dims is the
-    prefix for wd/cm/pw/p8 views."""
-    parts = []
-    # exhaustive enumeration (720 assignments)
-    parts.append(f"x0 AS (SELECT CAST(0 AS BIGINT) AS vis,\n"
-                 f"           CAST(0 AS BIGINT) AS cost,"
-                 f" CAST(0 AS BIGINT) AS pth\n"
-                 f"         FROM {dims}wd WHERE i = 0)")
-    for s in range(1, 7):
-        parts.append(
-            f"x{s} AS (SELECT x.vis + b.p AS vis,"
-            f" x.cost + c.w AS cost,\n"
-            f"           x.pth*8 + c.j AS pth\n"
-            f"         FROM x{s - 1} x JOIN {dims}cm c"
-            f" ON c.i = {s - 1}\n"
-            f"         JOIN {dims}pw b ON b.j = c.j\n"
-            f"         WHERE (x.vis {d} b.p) % 2 = 0)")
-    parts.append(
-        f"exh AS{mat} (SELECT CAST(min(cost) AS BIGINT)"
-        f" AS exh_opt,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_asg FROM x6)")
-    parts.append(
-        "nop AS (SELECT CAST(count(*) AS BIGINT) AS n_opt\n"
-        "         FROM x6 x CROSS JOIN exh e"
-        " WHERE x.cost = e.exh_opt)")
-    # greedy rows-in-order
-    parts.append(f"g0 AS (SELECT CAST(0 AS BIGINT) AS vis,"
-                 f" CAST(0 AS BIGINT) AS cost\n"
-                 f"         FROM {dims}wd WHERE i = 0)")
-    for s in range(1, 7):
-        parts.append(
-            f"gp{s} AS (SELECT max(g.vis) AS vis, max(g.cost)"
-            f" AS cost,\n"
-            f"           min(c.w*8 + c.j) AS pick\n"
-            f"         FROM g{s - 1} g JOIN {dims}cm c"
-            f" ON c.i = {s - 1}\n"
-            f"         JOIN {dims}pw b ON b.j = c.j\n"
-            f"         WHERE (g.vis {d} b.p) % 2 = 0)")
-        parts.append(
-            f"g{s} AS (SELECT p.vis + b.p AS vis,\n"
-            f"           p.cost + (p.pick {d} 8) AS cost\n"
-            f"         FROM gp{s} p JOIN {dims}pw b"
-            f" ON b.j = p.pick % 8)")
-    parts.append("grd AS (SELECT CAST(cost AS BIGINT)"
-                 " AS greedy_cost FROM g6)")
-    # duals from the closure: d(v) = min over workers of cl(w0, v)
-    parts.append(
-        f"dst AS{mat} (SELECT c.v, min(c.w) AS dv\n"
-        f"         FROM {cl} c WHERE c.u < 6 GROUP BY c.v)")
-    parts.append(
-        f"ngd AS (SELECT CAST(min(w) AS BIGINT) AS neg_diag\n"
-        f"         FROM {cl} WHERE u = v)")
-    parts.append(
-        f"ngs AS (SELECT CAST(min(w) AS BIGINT) AS neg_diag_sw\n"
-        f"         FROM {sw} WHERE u = v)")
-    parts.append(
-        f"du AS{mat} (SELECT c.i, c.j, c.w,\n"
-        f"           -wu.dv AS ui, vj.dv AS vj,\n"
-        f"           c.w + wu.dv - vj.dv AS slack,\n"
-        f"           CASE WHEN a.j IS NOT NULL THEN 1 ELSE 0 END"
-        f" AS matched\n"
-        f"         FROM {dims}cm c\n"
-        f"         JOIN dst wu ON wu.v = c.i\n"
-        f"         JOIN dst vj ON vj.v = 6 + c.j\n"
-        f"         LEFT JOIN {asg} a ON a.i = c.i"
-        f" AND a.j = c.j)")
-    parts.append(
-        "dcr AS (SELECT\n"
-        "           CAST(sum(CASE WHEN slack < 0 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS feas_viol,\n"
-        "           CAST(sum(CASE WHEN matched = 1 AND"
-        " slack <> 0\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS tight_viol,\n"
-        "           CAST(sum(CASE WHEN matched = 1 THEN"
-        " ui + vj\n"
-        "             ELSE 0 END) AS BIGINT) AS dual_sum\n"
-        "         FROM du)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM {tbl})")
-    fin = (
-        f"SELECT u.i, u.j, u.w, u.ui, u.vj, u.slack, u.matched,\n"
-        f"       p.opt, e.exh_opt - p.opt AS exh_resid,\n"
-        f"       e.n_asg, o.n_opt, g.greedy_cost,\n"
-        f"       g.greedy_cost - p.opt AS greedy_gap,\n"
-        f"       n.neg_diag, s.neg_diag_sw,\n"
-        f"       c.feas_viol, c.tight_viol,\n"
-        f"       c.dual_sum - p.opt AS dual_resid, l.n_docs\n"
-        f"FROM du u CROSS JOIN {dp} p CROSS JOIN exh e\n"
-        f"CROSS JOIN nop o CROSS JOIN grd g CROSS JOIN ngd n\n"
-        f"CROSS JOIN ngs s CROSS JOIN dcr c CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q604_oracle(tbl: str = "documents") -> str:
-    parts = [_q604_dims(tbl)]
-    parts.extend(_q604_dp("//"))
-    # assignment decode + exchange graphs + closures
-    parts.append(
-        "asg AS MATERIALIZED (SELECT p.k AS i,\n"
-        "         CAST((d.opt_pth // q.p) % 8 AS BIGINT) AS j\n"
-        "       FROM dp d JOIN p8 p ON p.k <= 5\n"
-        "       JOIN p8 q ON q.k = 5 - p.k)")
-    parts.append(
-        "swp AS MATERIALIZED (SELECT a.i,\n"
-        "         CASE WHEN a.i = 0 THEN b1.j WHEN a.i = 1"
-        " THEN b0.j\n"
-        "           ELSE a.j END AS j\n"
-        "       FROM asg a CROSS JOIN (SELECT j FROM asg"
-        " WHERE i = 0) b0\n"
-        "       CROSS JOIN (SELECT j FROM asg WHERE i = 1) b1)")
-    for base, at in (("cl", "asg"), ("sw", "swp")):
-        parts.append(
-            f"{base} AS MATERIALIZED (\n"
-            f"       SELECT c.i AS u, 6 + c.j AS v, c.w FROM cm c\n"
-            f"       UNION ALL\n"
-            f"       SELECT 6 + c.j, c.i, -c.w FROM cm c\n"
-            f"         JOIN {at} a ON a.i = c.i AND a.j = c.j\n"
-            f"       UNION ALL\n"
-            f"       SELECT w.i, w.i, CAST(0 AS BIGINT) FROM wd w\n"
-            f"       UNION ALL\n"
-            f"       SELECT 6 + w.i, 6 + w.i, CAST(0 AS BIGINT)"
-            f" FROM wd w)")
-        parts.extend(_q604_close(base, "", " MATERIALIZED"))
-    fparts, fin = _q604_final("dp", "asg", "cl_4", "sw_4", "",
-                              tbl, "//", " MATERIALIZED")
-    for fr in fparts:
-        nm, body = fr.split(" AS ", 1)
-        if body.startswith("MATERIALIZED"):
-            parts.append(fr)
-        else:
-            parts.append(f"{nm} AS MATERIALIZED {body.strip()}")
-    return ("WITH " + ",\n       ".join(parts) + "\n" + fin)
-
-
-@query("q604_assignment_duality", _q604_oracle())
-def q604(spark, sf_dir):
-    """The assignment problem with Klein's cycle-canceling
-    optimality certificate and explicit LP duality (Kuhn 1955,
-    Klein 1967 — the min-cost perfect matching every
-    task-to-executor scheduler solves, certified the way LP
-    theory says to certify it).  The optimum computes by subset
-    DP over job sets (6 stages, GROUP BY min over packed
-    (cost, path) so the witness rides the aggregate), is
-    cross-checked by full enumeration (n_asg == 720,
-    exh_resid == 0, n_opt == 1 — the fixture has a unique
-    optimum), and row-greedy pays 238 vs 98 (greedy_gap == 140).
-    The certificates are structural, not re-derivations: the
-    EXCHANGE GRAPH (forward arcs worker->job at +c for all pairs,
-    backward arcs job->worker at -c on matched pairs) has no
-    negative cycle iff the assignment is optimal — four min-plus
-    doubling stages close the graph and neg_diag == 0 exhibits
-    Klein's theorem on the optimum, while the SAME construction
-    on a planted two-row swap shows neg_diag_sw < 0 (the
-    certificate genuinely discriminates; the swap's alternating
-    cycle is the improving move cycle-canceling would take).
-    Dual variables are then CONSTRUCTED from the closure —
-    u_i = -d(i), v_j = d(j) with d = shortest distance from the
-    worker set — and verified: feas_viol == 0 (u_i + v_j <= c_ij
-    everywhere: the forward-arc triangle inequality),
-    tight_viol == 0 (equality on matched pairs: forced because
-    matched pairs carry arcs BOTH ways), dual_resid == 0 (the
-    dual objective telescopes to the primal cost — strong duality
-    witnessed, with every slack emitted per pair).  Scale: the
-    closure is the q568/q599 doubling shape on a 12-node dim;
-    the DP is one broadcast join + map-side min per stage."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q604_documents")
-    dims = _q604_dims("q604_documents")
-    for tv in ("wd", "cm", "pw", "p8"):
-        _pin_view(spark, f"WITH {dims} SELECT * FROM {tv}",
-                  f"q604_{tv}")
-    dpp = [p.replace(" wd ", " q604_wd ")
-            .replace(" cm ", " q604_cm ")
-            .replace(" pw ", " q604_pw ")
-           for p in _q604_dp("div", "q604_")]
-    _pin_view(spark,
-              "WITH " + ",\n       ".join(dpp[:-1]) + "\n"
-              + "SELECT " + dpp[-1].split("SELECT", 1)[1]
-              .rsplit(")", 1)[0].replace("FROM a6", "FROM a6"),
-              "q604_dp")
-    _pin_view(spark,
-              "SELECT p.k AS i,\n"
-              "       CAST((d.opt_pth div q.p) % 8 AS BIGINT)"
-              " AS j\n"
-              "FROM q604_dp d JOIN q604_p8 p ON p.k <= 5\n"
-              "JOIN q604_p8 q ON q.k = 5 - p.k",
-              "q604_asg")
-    _pin_view(spark,
-              "SELECT a.i,\n"
-              "       CASE WHEN a.i = 0 THEN b1.j WHEN a.i = 1"
-              " THEN b0.j\n"
-              "         ELSE a.j END AS j\n"
-              "FROM q604_asg a CROSS JOIN (SELECT j FROM q604_asg"
-              " WHERE i = 0) b0\n"
-              "CROSS JOIN (SELECT j FROM q604_asg WHERE i = 1) b1",
-              "q604_swp")
-    for base, at in (("cl", "q604_asg"), ("sw", "q604_swp")):
-        _pin_view(spark,
-                  f"SELECT c.i AS u, 6 + c.j AS v, c.w"
-                  f" FROM q604_cm c\n"
-                  f"UNION ALL\n"
-                  f"SELECT 6 + c.j, c.i, -c.w FROM q604_cm c\n"
-                  f"  JOIN {at} a ON a.i = c.i AND a.j = c.j\n"
-                  f"UNION ALL\n"
-                  f"SELECT w.i, w.i, CAST(0 AS BIGINT)"
-                  f" FROM q604_wd w\n"
-                  f"UNION ALL\n"
-                  f"SELECT 6 + w.i, 6 + w.i, CAST(0 AS BIGINT)"
-                  f" FROM q604_wd w",
-                  f"q604_{base}")
-        prev = f"q604_{base}"
-        for s in range(1, 5):
-            _pin_view(spark,
-                      f"SELECT u, v, min(w) AS w FROM (\n"
-                      f"  SELECT u, v, w FROM {prev}\n"
-                      f"  UNION ALL\n"
-                      f"  SELECT x.u, y.v, x.w + y.w\n"
-                      f"  FROM {prev} x JOIN {prev} y"
-                      f" ON y.u = x.v) t\n"
-                      f"GROUP BY u, v",
-                      f"q604_{base}_{s}")
-            prev = f"q604_{base}_{s}"
-    fparts, fin = _q604_final("q604_dp", "q604_asg", "q604_cl_4",
-                              "q604_sw_4", "q604_",
-                              "q604_documents", "div", "")
-    return spark.sql("WITH " + ",\n       ".join(fparts)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q605: Lights Out — GF(2) Gauss-Jordan, kernel, Fredholm alternative
-
-
-# planted press pattern (the design-time instance generator)
-_Q605_XT = [1 if (i * i * 3 + 5 * i + 1) % 7 < 3 else 0
-            for i in range(25)]
-
-
-def _q605_adj(e: str, u: str) -> str:
-    """GF(2) button matrix A(e,u) as a pure expression: press u
-    toggles lamp e iff same cell or rook-adjacent on the 5x5."""
-    return (f"(({e} {{d}} 5 = {u} {{d}} 5 AND"
-            f" abs({e} % 5 - {u} % 5) <= 1) OR\n"
-            f"            ({e} % 5 = {u} % 5 AND"
-            f" abs({e} {{d}} 5 - {u} {{d}} 5) <= 1))")
-
-
-def _q605_base(tbl: str) -> str:
-    xt = ", ".join(f"({i}, {x})" for i, x in enumerate(_Q605_XT))
-    adj = _q605_adj("e.i", "u.i")
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 25 AS BIGINT)"
-        f" AS i\n"
-        f"         FROM {tbl}),\n"
-        f"       axt AS (SELECT CAST(i AS BIGINT) AS i,"
-        f" CAST(x AS BIGINT) AS xv\n"
-        f"         FROM (VALUES {xt}) t(i, x)),\n"
-        f"       tg AS (SELECT e.i AS r,\n"
-        f"           CAST(sum(CASE WHEN {adj}\n"
-        f"             THEN x.xv ELSE 0 END) % 2 AS BIGINT)"
-        f" AS t1\n"
-        f"         FROM nd e CROSS JOIN nd u\n"
-        f"         JOIN axt x ON x.i = u.i\n"
-        f"         GROUP BY e.i),\n"
-        f"       m0 AS (SELECT e.i AS r, u.i AS c,\n"
-        f"           CAST(CASE WHEN {adj}\n"
-        f"             THEN 1 ELSE 0 END AS BIGINT) AS v,\n"
-        f"           CAST(-1 AS BIGINT) AS pv\n"
-        f"         FROM nd e CROSS JOIN nd u\n"
-        f"         UNION ALL\n"
-        f"         SELECT r, CAST(25 AS BIGINT), t1,"
-        f" CAST(-1 AS BIGINT) FROM tg\n"
-        f"         UNION ALL\n"
-        f"         SELECT r, CAST(26 AS BIGINT),\n"
-        f"           (t1 + CASE WHEN r = 1 THEN 1 ELSE 0 END)"
-        f" % 2,\n"
-        f"           CAST(-1 AS BIGINT) FROM tg)")
-
-
-def _q605_stage(k: int, prev: str) -> list:
-    """One Gauss-Jordan pivot stage on column k."""
-    return [
-        f"pr AS (SELECT CAST(coalesce(min(r), -1) AS BIGINT)"
-        f" AS pr\n"
-        f"         FROM {prev} WHERE c = {k} AND v = 1"
-        f" AND pv = -1)",
-        f"hk AS (SELECT r, v AS h FROM {prev} WHERE c = {k})",
-        f"pc AS (SELECT m.c, m.v AS pvv FROM {prev} m\n"
-        f"         JOIN pr p ON m.r = p.pr)",
-        f"mn AS (SELECT m.r, m.c,\n"
-        f"           CASE WHEN p.pr >= 0 AND m.r <> p.pr"
-        f" AND h.h = 1\n"
-        f"             THEN (m.v + coalesce(pc.pvv, 0)) % 2\n"
-        f"             ELSE m.v END AS v,\n"
-        f"           CASE WHEN m.r = p.pr THEN {k} ELSE m.pv END"
-        f" AS pv\n"
-        f"         FROM {prev} m CROSS JOIN pr p\n"
-        f"         JOIN hk h ON h.r = m.r\n"
-        f"         LEFT JOIN pc ON pc.c = m.c)"]
-
-
-def _q605_final(m: str, tbl: str, d: str, mat: str) -> str:
-    adj_eu = _q605_adj("e.i", "x.i").format(d=d)
-    return (
-        f"rk AS (SELECT CAST(count(DISTINCT pv) AS BIGINT)"
-        f" AS rank\n"
-        f"         FROM {m} WHERE pv >= 0),\n"
-        f"       fcd AS{mat} (SELECT n.i AS f FROM nd n\n"
-        f"         WHERE n.i NOT IN (SELECT pv FROM {m}"
-        f" WHERE pv >= 0)),\n"
-        f"       nf AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_free FROM fcd),\n"
-        # particular solution for t1: x_k = aug value of pivot row
-        f"       x1 AS{mat} (SELECT n.i,\n"
-        f"           CAST(coalesce(max(m.v), 0) AS BIGINT) AS x\n"
-        f"         FROM nd n LEFT JOIN {m} m\n"
-        f"           ON m.pv = n.i AND m.c = 25\n"
-        f"         GROUP BY n.i),\n"
-        # kernel vectors, one per free column
-        f"       kv AS{mat} (SELECT f.f, n.i,\n"
-        f"           CAST(CASE WHEN n.i = f.f THEN 1\n"
-        f"             ELSE coalesce(max(m.v), 0) END AS BIGINT)"
-        f" AS x\n"
-        f"         FROM fcd f CROSS JOIN nd n LEFT JOIN {m} m\n"
-        f"           ON m.pv = n.i AND m.c = f.f\n"
-        f"         GROUP BY f.f, n.i),\n"
-        # press x1 on the ORIGINAL matrix, compare to t1
-        f"       prss AS{mat} (SELECT e.i AS r,\n"
-        f"           CAST(sum(CASE WHEN {adj_eu}\n"
-        f"             THEN x.x ELSE 0 END) % 2 AS BIGINT) AS lit\n"
-        f"         FROM nd e CROSS JOIN x1 x\n"
-        f"         GROUP BY e.i),\n"
-        f"       pok AS (SELECT CAST(sum(CASE WHEN p.lit <> t.t1\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS press_viol\n"
-        f"         FROM prss p JOIN tg t ON t.r = p.r),\n"
-        # every kernel vector (and their sum) is quiet on A
-        f"       qok AS (SELECT CAST(sum(lit) AS BIGINT)"
-        f" AS quiet_viol FROM (\n"
-        f"           SELECT k.f, e.i,\n"
-        f"             sum(CASE WHEN {adj_eu}\n"
-        f"               THEN x.x ELSE 0 END) % 2 AS lit\n"
-        f"           FROM nd e CROSS JOIN kv x JOIN fcd k"
-        f" ON k.f = x.f\n"
-        f"           GROUP BY k.f, e.i) t),\n"
-        f"       k3 AS{mat} (SELECT i, CAST(sum(x) % 2 AS BIGINT)"
-        f" AS x\n"
-        f"         FROM kv GROUP BY i),\n"
-        f"       k3ok AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN {adj_eu} THEN x.x"
-        f" ELSE 0 END) % 2\n"
-        f"             AS BIGINT) AS lit, e.i\n"
-        f"         FROM nd e CROSS JOIN k3 x GROUP BY e.i),\n"
-        f"       k3c AS (SELECT CAST(sum(lit) AS BIGINT)"
-        f" AS ker3_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_eq"
-        f" FROM k3ok),\n"
-        # Fredholm: zero rows vs augment columns
-        f"       ic AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN c = 25 THEN v ELSE 0"
-        f" END) AS BIGINT) AS t1_incons,\n"
-        f"           CAST(sum(CASE WHEN c = 26 THEN v ELSE 0"
-        f" END) AS BIGINT) AS t2_incons\n"
-        f"         FROM {m} WHERE pv = -1 AND c >= 25),\n"
-        # orthogonality of both targets against both kernels
-        f"       ort AS{mat} (SELECT k.f,\n"
-        f"           CAST(sum(t.t1*x.x) % 2 AS BIGINT) AS o1,\n"
-        f"           CAST(sum(((t.t1 + CASE WHEN t.r = 1 THEN 1\n"
-        f"             ELSE 0 END) % 2)*x.x) % 2 AS BIGINT)"
-        f" AS o2\n"
-        f"         FROM tg t JOIN kv x ON x.i = t.r\n"
-        f"         JOIN fcd k ON k.f = x.f GROUP BY k.f),\n"
-        f"       orr AS (SELECT\n"
-        f"           CAST(sum(o1) AS BIGINT) AS orth_t1,\n"
-        f"           CAST(sum(o2) AS BIGINT) AS orth_t2"
-        f" FROM ort),\n"
-        # the solver's answer differs from the planted press
-        # pattern by a NONZERO kernel element
-        f"       dx AS{mat} (SELECT x.i,"
-        f" (x.x + a.xv) % 2 AS x\n"
-        f"         FROM x1 x JOIN axt a ON a.i = x.i),\n"
-        f"       dxc AS (SELECT CAST(sum(x) AS BIGINT)"
-        f" AS dx_weight FROM dx),\n"
-        f"       dxk AS (SELECT CAST(sum(lit) AS BIGINT)"
-        f" AS dx_ker_viol FROM (\n"
-        f"           SELECT e.i, sum(CASE WHEN {adj_eu}\n"
-        f"             THEN x.x ELSE 0 END) % 2 AS lit\n"
-        f"           FROM nd e CROSS JOIN dx x"
-        f" GROUP BY e.i) t),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT n.i, a.xv AS xt, x.x AS x1,\n"
-        f"       CAST(coalesce(max(CASE WHEN k.f = 23 THEN k.x"
-        f" END), 0) AS BIGINT) AS q1,\n"
-        f"       CAST(coalesce(max(CASE WHEN k.f = 24 THEN k.x"
-        f" END), 0) AS BIGINT) AS q2,\n"
-        f"       max(t.t1) AS t1,\n"
-        f"       CAST(max((t.t1 + CASE WHEN t.r = 1 THEN 1"
-        f" ELSE 0 END) % 2) AS BIGINT) AS t2,\n"
-        f"       max(r.rank) AS rank, max(f.n_free) AS n_free,\n"
-        f"       max(p.press_viol) AS press_viol,\n"
-        f"       max(q.quiet_viol) AS quiet_viol,\n"
-        f"       max(c3.ker3_viol) AS ker3_viol,\n"
-        f"       max(i2.t1_incons) AS t1_incons,\n"
-        f"       max(i2.t2_incons) AS t2_incons,\n"
-        f"       max(o.orth_t1) AS orth_t1,"
-        f" max(o.orth_t2) AS orth_t2,\n"
-        f"       max(w.dx_weight) AS dx_weight,\n"
-        f"       max(v.dx_ker_viol) AS dx_ker_viol,\n"
-        f"       max(l.n_docs) AS n_docs\n"
-        f"FROM nd n JOIN axt a ON a.i = n.i\n"
-        f"JOIN x1 x ON x.i = n.i\n"
-        f"LEFT JOIN kv k ON k.i = n.i\n"
-        f"JOIN tg t ON t.r = n.i\n"
-        f"CROSS JOIN rk r CROSS JOIN nf f CROSS JOIN pok p\n"
-        f"CROSS JOIN qok q CROSS JOIN k3c c3 CROSS JOIN ic i2\n"
-        f"CROSS JOIN orr o CROSS JOIN dxc w CROSS JOIN dxk v\n"
-        f"CROSS JOIN ld l\n"
-        f"GROUP BY n.i, a.xv, x.x")
-
-
-def _q605_oracle(tbl: str = "documents") -> str:
-    parts = [_q605_base(tbl).format(d="//")]
-    prev = "m0"
-    for k in range(25):
-        frs = _q605_stage(k, prev)
-        for fr in frs:
-            nm, body = fr.split(" AS ", 1)
-            parts.append(f"{nm}{k} AS MATERIALIZED"
-                         f" {body.strip()}"
-                         .replace("pr p", f"pr{k} p")
-                         .replace("JOIN hk h", f"JOIN hk{k} h")
-                         .replace("LEFT JOIN pc ",
-                                  f"LEFT JOIN pc{k} pc "))
-        prev = f"mn{k}"
-    parts.append(_q605_final(prev, tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q605_lights_out_gf2", _q605_oracle())
-def q605(spark, sf_dir):
-    """Lights Out solved by Gauss-Jordan over GF(2), with the
-    kernel and the Fredholm alternative computed, not cited
-    (Sutner 1989; Anderson & Feil 1998 — THE worked example of
-    linear algebra over a finite field, and the shape of every
-    parity-constraint solve: erasure codes, XOR filters, hash
-    seeds).  The 5x5 button matrix derives from pure row/column
-    arithmetic (press u toggles lamp e iff rook-adjacent), the
-    augmented system carries TWO targets at once — t1 generated
-    in-plan by pressing a planted pattern, t2 = t1 with one lamp
-    flipped — and 25 unrolled pivot stages run the full
-    Gauss-Jordan relationally: pivot row = packed min over
-    unpivoted rows with a 1 in the column, elimination = one
-    broadcast of the pivot row + a (v + pvv) % 2 update, pivot
-    bookkeeping carried as a per-row column.  The famous
-    structure falls out as emitted integers: rank == 23,
-    n_free == 2, and the two QUIET PATTERNS (kernel vectors,
-    extracted from the free columns of the RREF) are verified
-    against the ORIGINAL matrix — quiet_viol == 0, and
-    ker3_viol == 0 checks their sum is quiet too (the kernel is a
-    subspace, exhibited).  Solvability is decided twice,
-    independently: elimination says t1_incons == 0 and
-    t2_incons == 1 (a zero row with a lit augment), while the
-    Fredholm alternative says the same thing from the other side
-    — orth_t1 == 0 but orth_t2 == 1 (t2 fails orthogonality
-    against exactly one quiet pattern; A is symmetric, so
-    solvable iff orthogonal to the kernel).  The solver's answer
-    x1 presses back to t1 exactly (press_viol == 0 on the
-    original matrix) yet DIFFERS from the planted pattern:
-    dx_weight > 0 with dx_ker_viol == 0 proves x1 - xt is a
-    nonzero kernel element — the solution-space coset structure
-    live in the data.  Scale: the matrix is fixture-bounded (675
-    cells); each stage is one argmin + one broadcast join — the
-    classic O(n)-round distributed elimination shape."""
-    # Round-5 (the q599/q610 pattern): the 5x5 button matrix is a
-    # LITERAL — the 25 Gauss-Jordan pivot stages (27 pins, 4.8 s of
-    # roundtrips) run driver-side mirroring the stage spec (min
-    # unpivoted row on the column, XOR the pivot row into every
-    # other row with a 1, pv marks the pivot column), and the
-    # Fredholm certificates — rank/kernel extraction, pressing the
-    # particular solution on the ORIGINAL matrix, kernel quietness
-    # — stay relational over the pushed echelon table.
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q605_documents")
-
-    def _adj(e, u):
-        return ((e // 5 == u // 5 and abs(e % 5 - u % 5) <= 1)
-                or (e % 5 == u % 5 and abs(e // 5 - u // 5) <= 1))
-
-    tg = [sum(_Q605_XT[u] for u in range(25) if _adj(r, u)) % 2
-          for r in range(25)]
-    m = {(r, c): (1 if _adj(r, c) else 0)
-         for r in range(25) for c in range(25)}
-    for r in range(25):
-        m[(r, 25)] = tg[r]
-        m[(r, 26)] = (tg[r] + (1 if r == 1 else 0)) % 2
-    pv = {r: -1 for r in range(25)}
-    for k in range(25):
-        cand = [r for r in range(25)
-                if m[(r, k)] == 1 and pv[r] == -1]
-        pr = min(cand) if cand else -1
-        if pr < 0:
-            continue
-        prow = {c: m[(pr, c)] for c in range(27)}
-        for r in range(25):
-            if r != pr and m[(r, k)] == 1:
-                for c in range(27):
-                    m[(r, c)] = (m[(r, c)] + prow[c]) % 2
-        pv[pr] = k
-    local_df(spark,
-             sorted((r, c, m[(r, c)], pv[r])
-                    for r in range(25) for c in range(27)),
-             "r long, c long, v long, pv long") \
-        .createOrReplaceTempView("q605_m25")
-    base = _q605_base("q605_documents").format(d="div")
-    fin = _q605_final("q605_m25", "q605_documents", "div", "")
-    return spark.sql("WITH " + base + ",\n       " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q606: CYK parse counting — Catalan ambiguity vs closed form
-
-
-def _q606_base(tbl: str) -> str:
-    # strings: sid 1 = a^10 (Catalan), 2 = a^5 b^5 (unique parse),
-    # 3 = a^6 b^4 (reject); terminals as ints (0 = a, 1 = b)
-    st = []
-    for i in range(10):
-        st.append(f"(1, {i}, 0)")
-        st.append(f"(2, {i}, {0 if i < 5 else 1})")
-        st.append(f"(3, {i}, {0 if i < 6 else 1})")
-    stv = ", ".join(st)
-    # grammar: 1: S1 -> S1 S1 | a; 2: S2 -> A T | A B;
-    # 3: T -> S2 B; 4: A -> a; 5: B -> b
-    rb = ", ".join(f"({a}, {b}, {c})"
-                   for a, b, c in [(1, 1, 1), (2, 4, 3),
-                                   (2, 4, 5), (3, 2, 5)])
-    tr = ", ".join(f"({nt}, {t})"
-                   for nt, t in [(1, 0), (4, 0), (5, 1)])
-    return (
-        f"pd AS (SELECT DISTINCT CAST(doc_id % 10 AS BIGINT)"
-        f" AS i FROM {tbl}),\n"
-        f"       st AS (SELECT CAST(sid AS BIGINT) AS sid,"
-        f" CAST(i AS BIGINT) AS i,\n"
-        f"           CAST(t AS BIGINT) AS t\n"
-        f"         FROM (VALUES {stv}) x(sid, i, t)),\n"
-        f"       rb AS (SELECT CAST(a AS BIGINT) AS a,"
-        f" CAST(b AS BIGINT) AS b,\n"
-        f"           CAST(c AS BIGINT) AS c\n"
-        f"         FROM (VALUES {rb}) x(a, b, c)),\n"
-        f"       tr AS (SELECT CAST(nt AS BIGINT) AS nt,"
-        f" CAST(t AS BIGINT) AS t\n"
-        f"         FROM (VALUES {tr}) x(nt, t)),\n"
-        f"       ac1 AS (SELECT s.sid, p.i, CAST(1 AS BIGINT)"
-        f" AS l,\n"
-        f"           r.nt, CAST(1 AS BIGINT) AS cnt\n"
-        f"         FROM pd p JOIN st s ON s.i = p.i\n"
-        f"         JOIN tr r ON r.t = s.t)")
-
-
-def _q606_stage(l: int, prev: str, rb: str) -> str:
-    """Accumulate length-l cells onto the cell table."""
-    return (
-        f"SELECT sid, i, l, nt, cnt FROM {prev}\n"
-        f"         UNION ALL\n"
-        f"         SELECT x.sid, x.i, CAST({l} AS BIGINT),"
-        f" r.a,\n"
-        f"           sum(x.cnt*y.cnt) AS cnt\n"
-        f"         FROM {prev} x JOIN {prev} y\n"
-        f"           ON y.sid = x.sid AND y.i = x.i + x.l\n"
-        f"           AND x.l + y.l = {l}\n"
-        f"         JOIN {rb} r ON r.b = x.nt AND r.c = y.nt\n"
-        f"         GROUP BY x.sid, x.i, r.a")
-
-
-def _q606_final(acc: str, tbl: str, d: str, mat: str) -> str:
-    parts = ["fc0 AS (SELECT CAST(1 AS BIGINT) AS f)"]
-    for k in range(1, 19):
-        parts.append(f"fc{k} AS (SELECT f*{k} AS f FROM"
-                     f" fc{k - 1})")
-    parts.append(
-        f"bino AS{mat} (SELECT\n"
-        f"           a.f {d} (b.f*b.f) AS c189,\n"
-        f"           a.f % (b.f*b.f) AS m189,\n"
-        f"           a.f {d} (c.f*e.f) AS c1810,\n"
-        f"           a.f % (c.f*e.f) AS m1810,\n"
-        f"           a.f {d} (b.f*b.f) {d} 10 AS c_div,\n"
-        f"           (a.f {d} (b.f*b.f)) % 10 AS m_div\n"
-        f"         FROM fc18 a CROSS JOIN fc9 b\n"
-        f"         CROSS JOIN fc10 c CROSS JOIN fc8 e)")
-    parts.append(
-        f"seq AS{mat} (SELECT l, CAST(max(cnt) AS BIGINT) AS cat_l,\n"
-        f"           CAST(count(DISTINCT cnt) AS BIGINT)"
-        f" AS n_distinct\n"
-        f"         FROM {acc} WHERE sid = 1 AND nt = 1"
-        f" GROUP BY l)")
-    parts.append(
-        "unf AS (SELECT CAST(sum(CASE WHEN n_distinct <> 1"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS uniform_viol"
-        " FROM seq)")
-    parts.append(
-        f"tops AS{mat} (SELECT\n"
-        f"           CAST(max(CASE WHEN sid = 1 AND nt = 1"
-        f" THEN cnt END) AS BIGINT) AS cat_dp,\n"
-        f"           CAST(coalesce(max(CASE WHEN sid = 2 AND"
-        f" nt = 2 THEN cnt END), 0) AS BIGINT) AS uniq_cnt,\n"
-        f"           CAST(coalesce(max(CASE WHEN sid = 3 AND"
-        f" nt = 2 THEN cnt END), 0) AS BIGINT) AS rej_cnt\n"
-        f"         FROM {acc} WHERE i = 0 AND l = 10)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM {tbl})")
-    fin = (
-        f"SELECT s.l, s.cat_l,\n"
-        f"       t.cat_dp, b.c189 - b.c1810 AS cat_closed,\n"
-        f"       t.cat_dp - (b.c189 - b.c1810) AS cat_resid,\n"
-        f"       b.c_div, t.cat_dp - b.c_div AS cat_div_resid,\n"
-        f"       b.m189, b.m1810, b.m_div,\n"
-        f"       u.uniform_viol, t.uniq_cnt, t.rej_cnt,"
-        f" d.n_docs\n"
-        f"FROM seq s CROSS JOIN tops t CROSS JOIN bino b\n"
-        f"CROSS JOIN unf u CROSS JOIN ld d")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-def _q606_oracle(tbl: str = "documents") -> str:
-    parts = [_q606_base(tbl)]
-    prev = "ac1"
-    for l in range(2, 11):
-        parts.append(f"ac{l} AS MATERIALIZED"
-                     f" ({_q606_stage(l, prev, 'rb')})")
-        prev = f"ac{l}"
-    parts.append(_q606_final(prev, tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q606_cyk_catalan", _q606_oracle())
-def q606(spark, sf_dir):
-    """CYK parse COUNTING with the ambiguity certified against a
-    closed form (Cocke-Younger-Kasami 1965-67; the inside
-    algorithm of Baker 1979 with counts in place of
-    probabilities — the chart parser behind every grammar-based
-    extraction pass).  Three strings ride one chart: a^10 under
-    the maximally ambiguous S -> S S | a, a^5 b^5 and a^6 b^4
-    under an unambiguous a^n b^n grammar.  The DP is
-    length-synchronous (stage l sums cnt_left * cnt_right over
-    all splits and binary rules — one self-join + one hash
-    aggregation per length, the q598 wavefront), and its
-    headline number, 4862 parse trees for a^10, is verified
-    against TWO independent closed forms computed by an exact
-    18-stage factorial chain: the reflection-principle form
-    C(18,9) - C(18,10) and the divided form C(18,9)/10, with
-    every integer division's REMAINDER emitted (m189, m1810,
-    m_div all 0 — the divisibility is part of the theorem, so it
-    is checked, not assumed).  cat_resid == 0 and
-    cat_div_resid == 0 tie Catalan's three faces together;
-    the per-length sequence 1,1,2,5,14,...,4862 is emitted with
-    uniform_viol == 0 (on a uniform string every span of equal
-    length parses identically — a symmetry the chart must
-    respect); uniq_cnt == 1 and rej_cnt == 0 exercise the
-    unambiguous-accept and reject branches of the same chart.
-    Scale: chart cells are span-bounded; each length stage is one
-    equi-join on (sid, split point) + a map-side-combinable sum —
-    the parallel CKY shape, O(n) rounds."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q606_documents")
-    base = _q606_base("q606_documents")
-    _pin_view(spark, f"WITH {base}\nSELECT * FROM ac1",
-              "q606_ac1")
-    _pin_view(spark, f"WITH {base}\nSELECT * FROM rb", "q606_rb")
-    prev = "q606_ac1"
-    for l in range(2, 11):
-        _pin_view(spark, _q606_stage(l, prev, "q606_rb"),
-                  f"q606_ac{l}")
-        prev = f"q606_ac{l}"
-    fin = _q606_final(prev, "q606_documents", "div", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q607: Apriori frequent itemsets over real document text
-
-
-def _q607_sql(tbl: str, mt: str, d: str, mat: str,
-              brute: bool = False) -> str:
-    parts, fin = _q607_parts(tbl, mt, d, mat, brute)
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-def _q607_parts(tbl: str, mt: str, d: str, mat: str,
-                brute: bool = False):
-    parts = [
-        f"vc AS{mat} (SELECT DISTINCT w FROM {mt})",
-        f"msv AS (SELECT CAST(count(*) AS BIGINT) AS n,\n"
-        f"           CAST((53*count(*)) {d} 100 AS BIGINT) AS ms\n"
-        f"         FROM {tbl})",
-        f"s1 AS{mat} (SELECT w, CAST(count(*) AS BIGINT) AS c\n"
-        f"         FROM {mt} GROUP BY w)",
-        f"ff1 AS{mat} (SELECT s.w, s.c FROM s1 s"
-        f" CROSS JOIN msv m\n"
-        f"         WHERE s.c >= m.ms)",
-        f"cnd2 AS (SELECT CAST(count(*) AS BIGINT) AS n_cand2\n"
-        f"         FROM ff1 a JOIN ff1 b ON a.w < b.w)",
-        f"s2 AS{mat} (SELECT a.w AS w1, b.w AS w2,\n"
-        f"           CAST(count(*) AS BIGINT) AS c\n"
-        f"         FROM ff1 a JOIN ff1 b ON a.w < b.w\n"
-        f"         JOIN {mt} m1 ON m1.w = a.w\n"
-        f"         JOIN {mt} m2 ON m2.w = b.w\n"
-        f"           AND m2.doc_id = m1.doc_id\n"
-        f"         GROUP BY a.w, b.w)",
-        f"ff2 AS{mat} (SELECT s.w1, s.w2, s.c FROM s2 s"
-        f" CROSS JOIN msv m\n"
-        f"         WHERE s.c >= m.ms)",
-        # level-3 Apriori candidates: shared-prefix join + the
-        # downward-closure prune (third 2-subset frequent too)
-        f"cd3 AS{mat} (SELECT p.w1, p.w2, q.w2 AS w3\n"
-        f"         FROM ff2 p JOIN ff2 q\n"
-        f"           ON q.w1 = p.w1 AND q.w2 > p.w2\n"
-        f"         JOIN ff2 r ON r.w1 = p.w2 AND r.w2 = q.w2)",
-        f"cnd3 AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_cand3_apriori FROM cd3)",
-        f"s3 AS{mat} (SELECT c.w1, c.w2, c.w3,\n"
-        f"           CAST(count(*) AS BIGINT) AS c\n"
-        f"         FROM cd3 c\n"
-        f"         JOIN {mt} m1 ON m1.w = c.w1\n"
-        f"         JOIN {mt} m2 ON m2.w = c.w2"
-        f" AND m2.doc_id = m1.doc_id\n"
-        f"         JOIN {mt} m3 ON m3.w = c.w3"
-        f" AND m3.doc_id = m1.doc_id\n"
-        f"         GROUP BY c.w1, c.w2, c.w3)",
-        f"ff3 AS{mat} (SELECT s.w1, s.w2, s.w3, s.c FROM s3 s\n"
-        f"         CROSS JOIN msv m WHERE s.c >= m.ms)",
-    ]
-    if brute:
-        parts += [
-            # brute force: support of ALL vocab triples, no pruning
-            f"cndb AS (SELECT CAST(count(*) AS BIGINT)"
-            f" AS n_cand3_brute\n"
-            f"         FROM vc a JOIN vc b ON a.w < b.w\n"
-            f"         JOIN vc e ON b.w < e.w)",
-            f"bf3 AS{mat} (SELECT a.w AS w1, b.w AS w2, e.w AS w3,\n"
-            f"           CAST(count(*) AS BIGINT) AS c\n"
-            f"         FROM vc a JOIN vc b ON a.w < b.w\n"
-            f"         JOIN vc e ON b.w < e.w\n"
-            f"         JOIN {mt} m1 ON m1.w = a.w\n"
-            f"         JOIN {mt} m2 ON m2.w = b.w"
-            f" AND m2.doc_id = m1.doc_id\n"
-            f"         JOIN {mt} m3 ON m3.w = e.w"
-            f" AND m3.doc_id = m1.doc_id\n"
-            f"         GROUP BY a.w, b.w, e.w)",
-            f"bfr AS (SELECT CAST(count(*) AS BIGINT) AS n_f3_brute\n"
-            f"         FROM bf3 b CROSS JOIN msv m"
-            f" WHERE b.c >= m.ms)",
-            # prune exactness: Apriori's F3 == brute-force F3
-            f"lsp AS (SELECT\n"
-            f"           CAST(sum(CASE WHEN m.n*m.n*b.c > a.c*x.c*e.c\n"
-            f"             THEN 1 ELSE 0 END) AS BIGINT)"
-            f" AS n_lift_pos_all,\n"
-            f"           CAST(sum(CASE WHEN m.n*m.n*b.c <= a.c*x.c*e.c\n"
-            f"             THEN 1 ELSE 0 END) AS BIGINT)"
-            f" AS n_lift_neg_all\n"
-            f"         FROM bf3 b JOIN s1 a ON a.w = b.w1\n"
-            f"         JOIN s1 x ON x.w = b.w2\n"
-            f"         JOIN s1 e ON e.w = b.w3 CROSS JOIN msv m)",
-            f"prx AS (SELECT CAST(count(*) AS BIGINT) AS prune_miss\n"
-            f"         FROM bf3 b CROSS JOIN msv m\n"
-            f"         LEFT JOIN ff3 f ON f.w1 = b.w1"
-            f" AND f.w2 = b.w2 AND f.w3 = b.w3\n"
-            f"         WHERE b.c >= m.ms AND f.w1 IS NULL)",
-        ]
-    parts += [
-        f"dc2 AS (SELECT CAST(sum(CASE WHEN a.w IS NULL OR"
-        f" b.w IS NULL\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT) AS dc2_viol\n"
-        f"         FROM ff2 f LEFT JOIN ff1 a ON a.w = f.w1\n"
-        f"         LEFT JOIN ff1 b ON b.w = f.w2)",
-        f"dc3 AS (SELECT CAST(sum(CASE WHEN p.w1 IS NULL OR"
-        f" q.w1 IS NULL\n"
-        f"           OR r.w1 IS NULL THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS dc3_viol\n"
-        f"         FROM ff3 f\n"
-        f"         LEFT JOIN ff2 p ON p.w1 = f.w1"
-        f" AND p.w2 = f.w2\n"
-        f"         LEFT JOIN ff2 q ON q.w1 = f.w1"
-        f" AND q.w2 = f.w3\n"
-        f"         LEFT JOIN ff2 r ON r.w1 = f.w2"
-        f" AND r.w2 = f.w3)",
-        f"cnt AS (SELECT CAST((SELECT count(*) FROM vc)"
-        f" AS BIGINT) AS n_vocab,\n"
-        f"           CAST((SELECT count(*) FROM ff1) AS BIGINT)"
-        f" AS n_f1,\n"
-        f"           CAST((SELECT count(*) FROM ff2) AS BIGINT)"
-        f" AS n_f2,\n"
-        f"           CAST((SELECT count(*) FROM ff3) AS BIGINT)"
-        f" AS n_f3)"]
-    bcols = (
-        " db.n_cand3_brute,\n"
-        "       bf.n_f3_brute,"
-        " c.n_f3 - bf.n_f3_brute AS brute_resid,\n"
-        "       x.prune_miss,"
-        " ls.n_lift_pos_all, ls.n_lift_neg_all,\n") if brute else "\n"
-    bjoin = (
-        " CROSS JOIN cndb db"
-        " CROSS JOIN bfr bf\n"
-        "CROSS JOIN prx x CROSS JOIN lsp ls") if brute else ""
-    fin = (
-        f"SELECT f.w1, f.w2, f.w3, f.c AS supp,\n"
-        f"       p.c AS supp_12, q.c AS supp_13, r.c AS supp_23,\n"
-        f"       a.c AS supp_1, b.c AS supp_2, e.c AS supp_3,\n"
-        f"       m.n*f.c - p.c*e.c AS clift_num,\n"
-        f"       m.n, m.ms, c.n_vocab, c.n_f1, d2.n_cand2,"
-        f" c.n_f2,\n"
-        f"       d3.n_cand3_apriori, c.n_f3,{bcols}"
-        f"       x2.dc2_viol, x3.dc3_viol\n"
-        f"FROM ff3 f\n"
-        f"JOIN ff2 p ON p.w1 = f.w1 AND p.w2 = f.w2\n"
-        f"JOIN ff2 q ON q.w1 = f.w1 AND q.w2 = f.w3\n"
-        f"JOIN ff2 r ON r.w1 = f.w2 AND r.w2 = f.w3\n"
-        f"JOIN ff1 a ON a.w = f.w1\n"
-        f"JOIN ff1 b ON b.w = f.w2\n"
-        f"JOIN ff1 e ON e.w = f.w3\n"
-        f"CROSS JOIN msv m CROSS JOIN cnt c CROSS JOIN cnd2 d2\n"
-        f"CROSS JOIN cnd3 d3{bjoin}"
-        f" CROSS JOIN dc2 x2 CROSS JOIN dc3 x3")
-    return parts, fin
-
-
-_Q607_ORACLE = (
-    "WITH mt AS MATERIALIZED (SELECT DISTINCT doc_id, w FROM (\n"
-    "         SELECT doc_id, unnest(string_split(text, ' ')) AS w\n"
-    "         FROM documents) t WHERE w <> ''),\n"
-    "       " + _q607_sql("documents", "mt", "//", " MATERIALIZED"))
-
-
-@query("q607_apriori_itemsets", _Q607_ORACLE)
-def q607(spark, sf_dir):
-    """Apriori frequent-itemset mining over the real corpus
-    (Agrawal & Srikant 1994 — the candidate-generation algorithm
-    that made association mining tractable, and the canonical
-    monotone-pruning rule).  Transactions are the actual
-    documents; items are their distinct words (split on space —
-    the corpus vocabulary is data, not a fixture), and the
-    support threshold is corpus-proportional (53n/100 — pinned at
-    the corpus's triple-support median, measured before
-    committing per the decision-threshold discipline, so BOTH
-    sides of the bar stay populated at every scale factor
-    instead of fluctuation-collapsing to all-or-nothing).  The pipeline is the textbook one — F1, pair candidates
-    from F1 x F1, F2 by doc-keyed membership self-joins, level-3
-    candidates by shared-prefix join WITH the downward-closure
-    prune (the third 2-subset must itself be frequent — a
-    relational prune join), F3 by three-way support counting.
-    dc2_viol == 0 / dc3_viol == 0 verify
-    downward closure on the outputs themselves; every emitted
-    triple carries all six sub-supports and an exact-integer
-    lift verdict (n^2 * supp > s1*s2*s3 — no float confidence).
-    The no-pruning BRUTE-FORCE control — support of EVERY
-    vocabulary triple, proving brute_resid == 0 / prune_miss ==
-    0 (Apriori's exactness theorem on this data) and the
-    two-sided lift census over the unthresholded universe —
-    lives in tests/test_apriori_control.py (r4 verdict: a
-    deliberate O(V^3) control arm belongs in the suite, not the
-    timed headline; `_q607_sql(brute=True)` builds it for both
-    engines and the test compares them value-for-value).
-    Scale: membership is one scan + explode; level-k supports
-    are doc-keyed equi-joins with map-side-combinable counts;
-    the brute-force triple join is the blowup Apriori avoids."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q607_documents")
-    # REPARTITION hint: the checkpointed membership table would
-    # otherwise inherit AQE's coalesced single partition and run
-    # every support join on one task (measured 24 s at sf0.1 —
-    # single-threaded, not data-bound).  Each Apriori level is
-    # then materialized ONCE: the naive WITH chain re-executes
-    # ff2 three times inside cd3 (and s2's membership joins with
-    # it), turning a 2 s support count into a 13 s one — the
-    # count-references-per-stage rule applied to the engine side.
-    _ckpt_view(spark,
-               "SELECT /*+ REPARTITION(32, doc_id) */ DISTINCT"
-               " doc_id, w FROM (\n"
-               "  SELECT doc_id, explode(split(text, ' ')) AS w\n"
-               "  FROM q607_documents) t WHERE w <> ''",
-               "q607_mt")
-    parts, fin = _q607_parts("q607_documents", "q607_mt",
-                             "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q607_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        nm = fr.split(" AS ", 1)[0].strip()
-        body = _qual(fr.split(" AS ", 1)[1].strip())
-        if nm in ("msv", "ff1", "s2", "cd3", "s3"):
-            dep = (("WITH " + ",\n       ".join(kept) + "\n")
-                   if kept else "")
-            sql = f"{dep}SELECT * FROM {body[:-1]}) q"
-            if nm == "cd3":
-                # checkpointing the candidate set with real (small)
-                # stats + 32 partitions: the raw 3-way ff2 join's
-                # multiplied size estimate made Spark broadcast the
-                # CORPUS side and stream 4060 candidates on ONE
-                # task (measured 8.9 s single-threaded for s3)
-                df = spark.sql(sql).repartition(32)
-                df.localCheckpoint().toDF(*df.columns) \
-                    .createOrReplaceTempView(f"q607_{nm}")
-            else:
-                _ckpt_view(spark, sql, f"q607_{nm}")
-            done.append(nm)
-        else:
-            kept.append(f"{nm} AS {body}")
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q608: quadratic reciprocity verified by exhaustion
-
-
-_Q608_P = [5, 7, 11, 13, 17, 19, 23]
-
-
-def _q608_sql(tbl: str, d: str, mat: str) -> str:
-    pv = ", ".join(f"({p})" for p in _Q608_P)
-    # modexp a^((p-1)/2) mod p as pure column arithmetic:
-    # exponent <= 11 fits 4 bits; chained squares mod p
-    return (
-        f"pp AS (SELECT CAST(p AS BIGINT) AS p FROM\n"
-        f"           (VALUES {pv}) t(p)),\n"
-        f"       ad AS{mat} (SELECT DISTINCT p.p,\n"
-        f"           CAST(doc_id % p.p AS BIGINT) AS a\n"
-        f"         FROM {tbl} CROSS JOIN pp p\n"
-        f"         WHERE doc_id % p.p > 0),\n"
-        # quadratic residues by exhaustion: squares of all residues
-        f"       qr AS{mat} (SELECT DISTINCT p, (a*a) % p AS r\n"
-        f"         FROM ad),\n"
-        f"       leg AS{mat} (SELECT a.p, a.a,\n"
-        f"           CASE WHEN q.r IS NOT NULL THEN 1 ELSE -1 END"
-        f" AS lg,\n"
-        f"           ((a.a*a.a) % a.p) AS a2,\n"
-        f"           ((((a.a*a.a) % a.p)*((a.a*a.a) % a.p))"
-        f" % a.p) AS a4\n"
-        f"         FROM ad a LEFT JOIN qr q ON q.p = a.p"
-        f" AND q.r = a.a),\n"
-        # Euler's criterion: a^((p-1)/2) via 4-bit square chain
-        f"       eul AS{mat} (SELECT p, a, lg,\n"
-        f"           (((CASE WHEN ((p-1) {d} 2) % 2 = 1 THEN a"
-        f" ELSE 1 END)\n"
-        f"             * (CASE WHEN ((p-1) {d} 4) % 2 = 1 THEN a2"
-        f" ELSE 1 END) % p)\n"
-        f"             * ((CASE WHEN ((p-1) {d} 8) % 2 = 1 THEN a4"
-        f" ELSE 1 END)\n"
-        f"             * (CASE WHEN ((p-1) {d} 16) % 2 = 1 THEN\n"
-        f"                 (a4*a4) % p ELSE 1 END) % p)) % p"
-        f" AS pw\n"
-        f"         FROM leg),\n"
-        f"       euv AS (SELECT CAST(sum(CASE\n"
-        f"           WHEN lg = 1 AND pw <> 1 THEN 1\n"
-        f"           WHEN lg = -1 AND pw <> p - 1 THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS euler_viol"
-        f" FROM eul),\n"
-        # the Legendre symbol is completely multiplicative
-        f"       mlv AS (SELECT CAST(sum(CASE WHEN ab.lg <>"
-        f" x.lg*y.lg\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT) AS mult_viol\n"
-        f"         FROM leg x JOIN leg y ON y.p = x.p\n"
-        f"         JOIN leg ab ON ab.p = x.p\n"
-        f"           AND ab.a = (x.a*y.a) % x.p),\n"
-        # quadratic reciprocity over all 21 prime pairs
-        f"       rcp AS{mat} (SELECT x.p AS p, y.p AS q,\n"
-        f"           x.lg AS qmodp_lg, y.lg AS pmodq_lg,\n"
-        f"           CASE WHEN (((x.p - 1) {d} 2) *"
-        f" ((y.p - 1) {d} 2)) % 2 = 0\n"
-        f"             THEN 1 ELSE -1 END AS rhs\n"
-        f"         FROM leg x JOIN leg y\n"
-        f"           ON y.p > x.p AND x.a = y.p % x.p\n"
-        f"           AND y.a = x.p % y.p),\n"
-        f"       rcv AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           qmodp_lg*pmodq_lg <> rhs THEN 1 ELSE 0 END)\n"
-        f"           AS BIGINT) AS recip_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_pairs"
-        f" FROM rcp),\n"
-        # the two supplements
-        f"       sp1 AS (SELECT CAST(sum(CASE WHEN l.lg <>\n"
-        f"           CASE WHEN ((l.p - 1) {d} 2) % 2 = 0 THEN 1"
-        f" ELSE -1 END\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS supp1_viol\n"
-        f"         FROM leg l WHERE l.a = l.p - 1),\n"
-        f"       sp2 AS (SELECT CAST(sum(CASE WHEN l.lg <>\n"
-        f"           CASE WHEN ((l.p*l.p - 1) {d} 8) % 2 = 0"
-        f" THEN 1\n"
-        f"             ELSE -1 END THEN 1 ELSE 0 END) AS BIGINT)\n"
-        f"           AS supp2_viol\n"
-        f"         FROM leg l WHERE l.a = 2),\n"
-        # |QR| = (p-1)/2 per prime, by exhaustion
-        f"       qcv AS (SELECT CAST(sum(CASE WHEN t.c <>\n"
-        f"           (t.p - 1) {d} 2 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS qrcount_viol\n"
-        f"         FROM (SELECT p, CAST(count(*) AS BIGINT)"
-        f" AS c\n"
-        f"           FROM qr GROUP BY p) t),\n"
-        f"       cov AS (SELECT CAST(sum(CASE WHEN t.c <> t.p - 1"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS cover_viol\n"
-        f"         FROM (SELECT p, CAST(count(*) AS BIGINT)"
-        f" AS c\n"
-        f"           FROM ad GROUP BY p) t),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT l.p, l.a, CAST(l.lg AS BIGINT) AS legendre,\n"
-        f"       CAST(e.pw AS BIGINT) AS euler_pow,\n"
-        f"       v.euler_viol, m.mult_viol, r.recip_viol,\n"
-        f"       r.n_pairs, s1.supp1_viol, s2.supp2_viol,\n"
-        f"       q.qrcount_viol, c.cover_viol, d2.n_docs\n"
-        f"FROM leg l JOIN eul e ON e.p = l.p AND e.a = l.a\n"
-        f"CROSS JOIN euv v CROSS JOIN mlv m CROSS JOIN rcv r\n"
-        f"CROSS JOIN sp1 s1 CROSS JOIN sp2 s2 CROSS JOIN qcv q\n"
-        f"CROSS JOIN cov c CROSS JOIN ld d2")
-
-
-@query("q608_quadratic_reciprocity",
-       "WITH " + _q608_sql("documents", "//", " MATERIALIZED"))
-def q608(spark, sf_dir):
-    """Quadratic reciprocity verified by exhaustion (Gauss 1796 —
-    the theorema aureum, proved here the way a database proves
-    things: by checking every case, with each ingredient computed
-    from a genuinely different definition).  Residues derive from
-    the real doc ids (cover_viol == 0 certifies the corpus
-    populates every nonzero residue class mod each of the seven
-    primes 5..23); the quadratic-residue sets come from literal
-    exhaustive squaring (DISTINCT (a*a) % p over all residues),
-    and the Legendre symbol is defined from membership.  Euler's
-    criterion is then a cross-check between two different
-    machines: a^((p-1)/2) computed by a 4-bit square-and-multiply
-    Column chain must land on 1 exactly for members and p-1 for
-    non-members (euler_viol == 0 over all 88 (a,p) pairs).
-    mult_viol == 0 checks complete multiplicativity over ALL
-    ~2000 (a,b,p) triples — the symbol is a character, verified
-    not asserted.  The centerpiece: for all 21 pairs of distinct
-    primes, (p|q)(q|p) == (-1)^((p-1)/2 * (q-1)/2)
-    (recip_viol == 0), with both supplements — (-1|p) by
-    (p-1)/2's parity, (2|p) by (p^2-1)/8's parity — holding at
-    every prime (supp1_viol == supp2_viol == 0), and the count
-    theorem |QR| == (p-1)/2 by exhaustion (qrcount_viol == 0).
-    Scale: one corpus scan seeds the residue dims; everything
-    else is broadcast-size dim algebra — the exhaustion is 2000
-    rows, not 2000 tasks."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q608_documents")
-    return spark.sql(
-        "WITH " + _q608_sql("q608_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q609: LIS — Mirsky partitions and the Erdős–Szekeres injection
-
-
-def _q609_base(tbl: str) -> str:
-    # 64 strictly-distinct values in doc order from real lengths
-    return (
-        f"sq AS (SELECT doc_id AS i,\n"
-        f"           n_chars*64 + doc_id AS v\n"
-        f"         FROM {tbl} WHERE doc_id < 64)")
-
-
-def _q609_edges(up: bool) -> str:
-    op = "<" if up else ">"
-    return (f"SELECT a.i AS x, b.i AS y, CAST(1 AS BIGINT) AS w\n"
-            f"FROM sq a JOIN sq b ON a.i < b.i AND a.v {op} b.v\n"
-            f"UNION ALL SELECT i, i, CAST(0 AS BIGINT) FROM sq")
-
-
-def _q609_double(prev: str) -> str:
-    return (f"SELECT x, y, max(w) AS w FROM (\n"
-            f"         SELECT x, y, w FROM {prev}\n"
-            f"         UNION ALL\n"
-            f"         SELECT a.x, b.y, a.w + b.w\n"
-            f"         FROM {prev} a JOIN {prev} b ON b.x = a.y)"
-            f" t GROUP BY x, y")
-
-
-def _q609_final(ci: str, cd: str, tbl: str, d: str,
-                mat: str) -> str:
-    return (
-        f"icl AS{mat} (SELECT s.i, s.v,\n"
-        f"           1 + coalesce(max(c.w), 0) AS cls\n"
-        f"         FROM sq s LEFT JOIN {ci} c"
-        f" ON c.y = s.i AND c.w > 0\n"
-        f"         GROUP BY s.i, s.v),\n"
-        f"       dcl AS{mat} (SELECT s.i, s.v,\n"
-        f"           1 + coalesce(max(c.w), 0) AS cls\n"
-        f"         FROM sq s LEFT JOIN {cd} c"
-        f" ON c.y = s.i AND c.w > 0\n"
-        f"         GROUP BY s.i, s.v),\n"
-        f"       lis AS (SELECT CAST(max(cls) AS BIGINT) AS lis,\n"
-        f"           CAST(count(DISTINCT cls) AS BIGINT)"
-        f" AS n_icls FROM icl),\n"
-        f"       lds AS (SELECT CAST(max(cls) AS BIGINT) AS lds,\n"
-        f"           CAST(count(DISTINCT cls) AS BIGINT)"
-        f" AS n_dcls FROM dcl),\n"
-        # Mirsky: each inc-class is a DECREASING subsequence
-        f"       avl AS (SELECT CAST(sum(CASE WHEN a.v < b.v"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS anti_viol\n"
-        f"         FROM icl a JOIN icl b\n"
-        f"           ON a.cls = b.cls AND a.i < b.i),\n"
-        f"       cvl AS (SELECT CAST(sum(CASE WHEN a.v > b.v"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS chain_viol\n"
-        f"         FROM dcl a JOIN dcl b\n"
-        f"           ON a.cls = b.cls AND a.i < b.i),\n"
-        # Erdős–Szekeres: the (inc_class, dec_class) map is
-        # injective — the pigeonhole proof, computed
-        f"       inj AS (SELECT CAST(sum(CASE WHEN a.i < b.i"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS pair_inj_viol\n"
-        f"         FROM (SELECT x.i, x.cls AS ic, y.cls AS dc\n"
-        f"           FROM icl x JOIN dcl y ON y.i = x.i) a\n"
-        f"         JOIN (SELECT x.i, x.cls AS ic, y.cls AS dc\n"
-        f"           FROM icl x JOIN dcl y ON y.i = x.i) b\n"
-        f"           ON b.ic = a.ic AND b.dc = a.dc),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT a.i, a.v {d} 64 AS n_chars, a.cls AS inc_cls,\n"
-        f"       b.cls AS dec_cls,\n"
-        f"       l.lis, m.lds, l.n_icls, m.n_dcls,\n"
-        f"       l.n_icls - l.lis AS mirsky_resid,\n"
-        f"       m.n_dcls - m.lds AS dual_resid,\n"
-        f"       v.anti_viol, c.chain_viol, j.pair_inj_viol,\n"
-        f"       CAST(CASE WHEN l.lis*m.lds >= 64 THEN 1 ELSE 0"
-        f" END AS BIGINT) AS es_ok,\n"
-        f"       d2.n_docs\n"
-        f"FROM icl a JOIN dcl b ON b.i = a.i\n"
-        f"CROSS JOIN lis l CROSS JOIN lds m CROSS JOIN avl v\n"
-        f"CROSS JOIN cvl c CROSS JOIN inj j CROSS JOIN ld d2")
-
-
-def _q609_oracle(tbl: str = "documents") -> str:
-    parts = [_q609_base(tbl)]
-    for nm, up in (("ci", True), ("cd", False)):
-        parts.append(f"{nm}0 AS MATERIALIZED"
-                     f" ({_q609_edges(up)})")
-        prev = f"{nm}0"
-        for s in range(1, 7):
-            parts.append(f"{nm}{s} AS MATERIALIZED"
-                         f" ({_q609_double(prev)})")
-            prev = f"{nm}{s}"
-    parts.append(_q609_final("ci6", "cd6", tbl, "//",
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q609_lis_erdos_szekeres", _q609_oracle())
-def q609(spark, sf_dir):
-    """Longest increasing subsequence with the Mirsky partition
-    and the Erdős–Szekeres injection computed as certificates
-    (Erdős & Szekeres 1935, Mirsky 1971 — the order-theoretic
-    pair behind patience sorting and every 'how sorted is this
-    stream' question).  The sequence is real: the first 64
-    documents' n_chars in doc order, ties broken by packing
-    doc_id into the value so comparisons are strict.  LIS and LDS
-    are longest paths in the two comparability DAGs, computed by
-    6 max-plus pointer-doubling stages each (no sequential DP
-    loop); each element's inc_cls = longest increasing run ENDING
-    there — and that single number carries three theorems, each
-    verified against the raw values rather than the DP: (1)
-    Mirsky — the inc-class partition has exactly LIS classes
-    (mirsky_resid == 0) and every class is genuinely DECREASING
-    (anti_viol == 0 over all same-class pairs): a minimum
-    antichain cover constructed, matching the longest chain, i.e.
-    strong duality for partial orders; (2) the dual partition
-    from LDS classes is increasing-within-class (chain_viol == 0,
-    dual_resid == 0); (3) Erdős–Szekeres — the map
-    i -> (inc_cls, dec_cls) is INJECTIVE (pair_inj_viol == 0
-    over all element pairs), which is literally the pigeonhole
-    proof that lis*lds >= n (es_ok == 1 rides along).  Scale:
-    the DAG is bounded by the window (64 elements); closures are
-    the q568 doubling shape; on an unbounded stream this is the
-    per-shard sketch whose classes merge by max."""
-    # Round-5 (the q599/q614 pattern): the former 15 pins ran two
-    # max-plus doubling chains over a 64-element window; the
-    # closures now compose driver-side from the one bounded collect
-    # of the window (spec mirrored: max over prev union prev-o-prev
-    # with summed weights, 6 doublings), and every certificate —
-    # Mirsky partition, dual chains, Erdos-Szekeres injectivity —
-    # stays relational in the final statement.
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q609_documents")
-    pdf = spark.sql("WITH " + _q609_base("q609_documents")
-                    + "\nSELECT * FROM sq").toPandas()
-    assert len(pdf) <= 64, len(pdf)
-    local_df(spark, sorted((int(r.i), int(r.v))
-                           for r in pdf.itertuples()),
-             "i long, v long").createOrReplaceTempView("q609_sq")
-    seq = {int(r.i): int(r.v) for r in pdf.itertuples()}
-    for nm, up in (("ci", True), ("cd", False)):
-        pairs = {(i, i): 0 for i in seq}
-        for a in seq:
-            for b in seq:
-                if a < b and ((seq[a] < seq[b]) if up
-                              else (seq[a] > seq[b])):
-                    pairs[(a, b)] = 1
-        for _s in range(6):
-            nxt = dict(pairs)
-            by_left: dict = {}
-            for (x, y), w in pairs.items():
-                by_left.setdefault(x, []).append((y, w))
-            for (x, y), w in pairs.items():
-                for z, w2 in by_left.get(y, []):
-                    if w + w2 > nxt.get((x, z), -1):
-                        nxt[(x, z)] = w + w2
-            pairs = nxt
-        local_df(spark,
-                 sorted((x, y, w) for (x, y), w in pairs.items()),
-                 "x long, y long, w long") \
-            .createOrReplaceTempView(f"q609_{nm}6")
-    fin = _q609_final("q609_ci6", "q609_cd6", "q609_documents",
-                      "div", "")
-    return spark.sql("WITH " + fin
-                     .replace("FROM sq s", "FROM q609_sq s"))
-
-
-# ---------------------------------------------------------------------------
-# q610: DFA minimization — Moore refinement vs Myhill-Nerode
-
-
-_Q610_DELTA = [(0, 0, 2), (0, 1, 1), (1, 0, 3), (1, 1, 6),
-               (6, 0, 2), (6, 1, 0), (2, 0, 3), (2, 1, 4),
-               (3, 0, 2), (3, 1, 5), (4, 0, 2), (4, 1, 1),
-               (5, 0, 3), (5, 1, 6), (7, 0, 7), (7, 1, 4)]
-_Q610_ACC = (4, 5)
-
-
-def _q610_dims(tbl: str) -> str:
-    dv = ", ".join(f"({s}, {y}, {t})" for s, y, t in _Q610_DELTA)
-    return (
-        f"sd AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS s FROM {tbl}),\n"
-        f"       dt AS (SELECT CAST(s AS BIGINT) AS s,"
-        f" CAST(y AS BIGINT) AS y,\n"
-        f"           CAST(t AS BIGINT) AS t\n"
-        f"         FROM (VALUES {dv}) v(s, y, t)),\n"
-        f"       ac AS (SELECT CAST(s AS BIGINT) AS s FROM\n"
-        f"           (VALUES ({_Q610_ACC[0]}), ({_Q610_ACC[1]}))"
-        f" v(s))")
-
-
-def _q610_cls_round(prev: str, dt: str, rs: str) -> str:
-    """One Moore refinement round; class id = min group member."""
-    return (
-        f"SELECT g.s, g2.ncls AS cls FROM\n"
-        f"  (SELECT c.s, c.cls AS c0, ca.cls AS ca, cb.cls AS cb\n"
-        f"   FROM {prev} c\n"
-        f"   JOIN {dt} da ON da.s = c.s AND da.y = 0\n"
-        f"   JOIN {dt} db ON db.s = c.s AND db.y = 1\n"
-        f"   JOIN {prev} ca ON ca.s = da.t\n"
-        f"   JOIN {prev} cb ON cb.s = db.t) g\n"
-        f"JOIN (SELECT c0, ca, cb, min(s) AS ncls FROM\n"
-        f"  (SELECT c.s, c.cls AS c0, ca.cls AS ca, cb.cls AS cb\n"
-        f"   FROM {prev} c\n"
-        f"   JOIN {dt} da ON da.s = c.s AND da.y = 0\n"
-        f"   JOIN {dt} db ON db.s = c.s AND db.y = 1\n"
-        f"   JOIN {prev} ca ON ca.s = da.t\n"
-        f"   JOIN {prev} cb ON cb.s = db.t) h\n"
-        f"  GROUP BY c0, ca, cb) g2\n"
-        f"  ON g2.c0 = g.c0 AND g2.ca = g.ca AND g2.cb = g.cb")
-
-
-def _q610_final(cls4: str, cls5: str, pcl: str, dims_pre: str,
-                tbl: str, d: str, mat: str) -> str:
-    sym = lambda k: (f"CASE WHEN substr(d2.text, {k}, 1) IN\n"
-                     f"             ('a','e','i','o','u') THEN 0"
-                     f" ELSE 1 END")
-    parts = [
-        f"d0 AS (SELECT p.s*8 + q.s AS pr\n"
-        f"         FROM {dims_pre}sd p CROSS JOIN {dims_pre}sd q\n"
-        f"         LEFT JOIN {dims_pre}ac xp ON xp.s = p.s\n"
-        f"         LEFT JOIN {dims_pre}ac xq ON xq.s = q.s\n"
-        f"         WHERE (xp.s IS NULL) <> (xq.s IS NULL))",
-        f"dsp AS{mat} (SELECT c.u {d} 8 AS p, c.u % 8 AS q\n"
-        f"         FROM {pcl} c JOIN d0 ON d0.pr = c.v\n"
-        f"         GROUP BY c.u)",
-        # Moore == Nerode over all reachable state pairs
-        f"nrv AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           (cp.cls = cq.cls) <> (ds.p IS NULL)"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS nerode_resid\n"
-        f"         FROM {cls4} cp CROSS JOIN {cls4} cq2\n"
-        f"         JOIN {cls4} cq ON cq.s = cq2.s\n"
-        f"         LEFT JOIN dsp ds ON ds.p = cp.s"
-        f" AND ds.q = cq.s\n"
-        f"         WHERE cq2.s = cq.s)",
-        f"fxp AS (SELECT CAST(sum(CASE WHEN a.cls <> b.cls"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS fixpoint_resid\n"
-        f"         FROM {cls4} a JOIN {cls5} b ON b.s = a.s)",
-        f"ncl AS (SELECT CAST(count(DISTINCT cls) AS BIGINT)"
-        f" AS n_classes,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_reachable\n"
-        f"         FROM {cls4})",
-        # minimality: distinct classes are pairwise distinguishable
-        f"mnv AS (SELECT CAST(sum(CASE WHEN ds.p IS NULL THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS min_viol\n"
-        f"         FROM (SELECT DISTINCT cls FROM {cls4}) a\n"
-        f"         JOIN (SELECT DISTINCT cls FROM {cls4}) b\n"
-        f"           ON b.cls > a.cls\n"
-        f"         LEFT JOIN dsp ds ON ds.p = a.cls"
-        f" AND ds.q = b.cls)",
-        # minimized automaton: transitions through class reps
-        f"md AS{mat} (SELECT c.cls AS s, t.y,"
-        f" c2.cls AS t\n"
-        f"         FROM (SELECT DISTINCT cls FROM {cls4}) c\n"
-        f"         JOIN {dims_pre}dt t ON t.s = c.cls\n"
-        f"         JOIN {cls4} c2 ON c2.s = t.t)",
-        f"mac AS (SELECT DISTINCT c.cls FROM {cls4} c\n"
-        f"         JOIN {dims_pre}ac a ON a.s = c.s)",
-        f"tr0 AS (SELECT d2.doc_id, CAST(0 AS BIGINT) AS s,\n"
-        f"           CAST(0 AS BIGINT) AS m FROM {tbl} d2)",
-    ]
-    for k in range(1, 13):
-        parts.append(
-            f"tr{k} AS (SELECT t.doc_id, dd.t AS s, mm.t AS m\n"
-            f"         FROM tr{k - 1} t JOIN {tbl} d2"
-            f" ON d2.doc_id = t.doc_id\n"
-            f"         JOIN {dims_pre}dt dd ON dd.s = t.s\n"
-            f"           AND dd.y = {sym(k)}\n"
-            f"         JOIN md mm ON mm.s = t.m\n"
-            f"           AND mm.y = {sym(k)})")
-    parts.extend([
-        f"bh AS{mat} (SELECT\n"
-        f"           CAST(sum(CASE WHEN (xa.s IS NULL) <>\n"
-        f"             (xm.cls IS NULL) THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS behav_viol,\n"
-        f"           CAST(sum(CASE WHEN xa.s IS NOT NULL THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS n_accept_docs,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM tr12 t\n"
-        f"         LEFT JOIN {dims_pre}ac xa ON xa.s = t.s\n"
-        f"         LEFT JOIN mac xm ON xm.cls = t.m)"])
-    fin = (
-        f"SELECT c.s, c.cls AS moore_cls,\n"
-        f"       n.n_reachable, n.n_classes,\n"
-        f"       f.fixpoint_resid, r.nerode_resid, m.min_viol,\n"
-        f"       b.behav_viol, b.n_accept_docs, b.n_docs\n"
-        f"FROM {cls4} c CROSS JOIN ncl n CROSS JOIN fxp f\n"
-        f"CROSS JOIN nrv r CROSS JOIN mnv m CROSS JOIN bh b")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-def _q610_oracle(tbl: str = "documents") -> str:
-    parts = [_q610_dims(tbl)]
-    # reachability closure from state 0 (3 doubling stages)
-    parts.append("rc0 AS MATERIALIZED (SELECT s AS a, s AS b"
-                 " FROM sd\n"
-                 "       UNION SELECT s, t FROM dt)")
-    prev = "rc0"
-    for k in range(1, 4):
-        parts.append(f"rc{k} AS MATERIALIZED"
-                     f" ({_q568_double(prev)})")
-        prev = f"rc{k}"
-    parts.append("rs AS MATERIALIZED (SELECT b AS s FROM rc3"
-                 " WHERE a = 0)")
-    parts.append(
-        "cl0 AS MATERIALIZED (SELECT r.s,\n"
-        "         CAST(CASE WHEN a.s IS NOT NULL THEN 1 ELSE 0"
-        " END AS BIGINT) AS cls\n"
-        "       FROM rs r LEFT JOIN ac a ON a.s = r.s)")
-    prev = "cl0"
-    for k in range(1, 6):
-        parts.append(
-            f"cl{k} AS MATERIALIZED"
-            f" ({_q610_cls_round(prev, 'dt', 'rs')})")
-        prev = f"cl{k}"
-    # pair-graph closure for distinguishability
-    parts.append(
-        "pg0 AS MATERIALIZED (SELECT p.s*8 + q.s AS a,"
-        " p.s*8 + q.s AS b\n"
-        "       FROM rs p CROSS JOIN rs q\n"
-        "       UNION SELECT x.s*8 + y.s, x.t*8 + y.t\n"
-        "       FROM dt x JOIN dt y ON y.y = x.y)")
-    prev = "pg0"
-    for k in range(1, 7):
-        parts.append(f"pg{k} AS MATERIALIZED"
-                     f" ({_q568_double(prev)})")
-        prev = f"pg{k}"
-    parts.append(
-        "pcl AS MATERIALIZED (SELECT a AS u, b AS v FROM pg6)")
-    parts.append(_q610_final("cl4", "cl5", "pcl", "", tbl, "//",
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q610_dfa_minimization", _q610_oracle())
-def q610(spark, sf_dir):
-    """DFA minimization with Moore's refinement cross-examined by
-    Myhill-Nerode (Moore 1956, Hopcroft 1971, Myhill-Nerode 1958
-    — the canonical-form theorem behind every regex engine's
-    compile step).  An 8-state DFA for 'ends in ab' carries three
-    planted redundancies — states split into behavioral clones
-    plus one unreachable state — and the pipeline computes:
-    reachability (q568 doubling, n_reachable == 7 drops the
-    planted orphan), then round-synchronous Moore refinement
-    (signature = (class, class of a-move, class of b-move), new
-    class id = min group member so ids are canonical), with the
-    fixpoint EMITTED (round 5 == round 4, fixpoint_resid == 0)
-    and n_classes == 3.  The refinement is then checked against a
-    genuinely different machine: the PRODUCT-AUTOMATON
-    distinguishability closure (pair (p,q) is distinguishable iff
-    it reaches an accept/reject-split pair in the 64-node pair
-    graph — 6 doubling stages), and nerode_resid == 0 verifies
-    over ALL reachable pairs that Moore's classes are EXACTLY the
-    Nerode equivalence — the theorem that makes the minimal DFA
-    canonical.  min_viol == 0 confirms the quotient automaton has
-    no equivalent pair left (it is minimal, by its own
-    distinguishability), and the behavioral check runs BOTH
-    machines over the real corpus — each document's first 12
-    characters map to vowel/consonant symbols, 12 transition
-    joins drive original and quotient automata in lockstep, and
-    behav_viol == 0 over every document is bisimulation tested on
-    data, with n_accept_docs riding along.  Scale: dims are
-    broadcast-size; the trace is a linear 12-join chain over the
-    corpus — the classic run-a-DFA-over-every-row shape."""
-    # Round-5 (the q599/q614 pattern): the DFA is an 8-state
-    # LITERAL — the former 16 pins (reachability, 5 Moore rounds,
-    # 6 pair-graph doublings) run driver-side mirroring the spec
-    # (min-group-member class ids, >=1-step product closure with
-    # rs-pair self-loops); the CORPUS-side behavioral trace, the
-    # Nerode/minimality checks and the fixpoint all stay relational
-    # over the pushed cl4/cl5/pcl tables in the final statement.
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q610_documents")
-    dims = _q610_dims("q610_documents")
-    _pin_view(spark, f"WITH {dims} SELECT * FROM sd", "q610_sd")
-    local_df(spark, [(s, y, t) for s, y, t in _Q610_DELTA],
-             "s long, y long, t long") \
-        .createOrReplaceTempView("q610_dt")
-    local_df(spark, [(s,) for s in _Q610_ACC], "s long") \
-        .createOrReplaceTempView("q610_ac")
-    dtm = {(s, y): t for s, y, t in _Q610_DELTA}
-    rs = {0}
-    frontier = [0]
-    while frontier:
-        nxt = []
-        for s in frontier:
-            for y in (0, 1):
-                t = dtm[(s, y)]
-                if t not in rs:
-                    rs.add(t)
-                    nxt.append(t)
-        frontier = nxt
-    cls = {s: (1 if s in _Q610_ACC else 0) for s in rs}
-    hist = [dict(cls)]
-    for _k in range(5):
-        sig = {s: (cls[s], cls[dtm[(s, 0)]], cls[dtm[(s, 1)]])
-               for s in rs}
-        rep: dict = {}
-        for s in sorted(rs):
-            rep.setdefault(sig[s], s)
-        cls = {s: rep[sig[s]] for s in rs}
-        hist.append(dict(cls))
-    for k in (4, 5):
-        local_df(spark, sorted(hist[k].items()),
-                 "s long, cls long") \
-            .createOrReplaceTempView(f"q610_cl{k}")
-    edges: dict = {}
-    for p in sorted(rs):
-        for q in sorted(rs):
-            edges.setdefault(p * 8 + q, set()).add(p * 8 + q)
-    for p in range(8):
-        for q in range(8):
-            for y in (0, 1):
-                edges.setdefault(p * 8 + q, set()).add(
-                    dtm[(p, y)] * 8 + dtm[(q, y)])
-    pcl = []
-    for u in sorted(edges):
-        seen: set = set()
-        stack = list(edges[u])
-        while stack:
-            v = stack.pop()
-            if v in seen:
-                continue
-            seen.add(v)
-            stack.extend(edges.get(v, ()))
-        pcl += [(u, v) for v in sorted(seen)]
-    local_df(spark, pcl, "u long, v long") \
-        .createOrReplaceTempView("q610_pcl")
-    fin = _q610_final("q610_cl4", "q610_cl5", "q610_pcl",
-                      "q610_", "q610_documents", "div", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q611: Game of Life — glider transport, still life, oscillator
-
-
-_Q611_INIT = [(2, 1), (3, 2), (1, 3), (2, 3), (3, 3),   # glider
-              (10, 2), (11, 2), (10, 3), (11, 3),       # block
-              (2, 10), (3, 10), (4, 10),                # blinker
-              (14, 14), (15, 14)]                       # dying duo
-
-
-def _q611_base(tbl: str) -> str:
-    iv = ", ".join(f"({x}, {y})" for x, y in _Q611_INIT)
-    od = ", ".join(f"({dx}, {dy})" for dx in (-1, 0, 1)
-                   for dy in (-1, 0, 1) if dx or dy)
-    return (
-        f"ivd AS (SELECT CAST(x AS BIGINT) AS x, CAST(y AS"
-        f" BIGINT) AS y\n"
-        f"         FROM (VALUES {iv}) t(x, y)),\n"
-        f"       od AS (SELECT CAST(dx AS BIGINT) AS dx,\n"
-        f"           CAST(dy AS BIGINT) AS dy\n"
-        f"         FROM (VALUES {od}) t(dx, dy)),\n"
-        f"       g0 AS (SELECT x, y FROM ivd)")
-
-
-def _q611_step(prev: str, od: str) -> str:
-    """One synchronous Life generation: B3/S23."""
-    return (
-        f"SELECT n.x, n.y FROM\n"
-        f"  (SELECT c.x + o.dx AS x, c.y + o.dy AS y,\n"
-        f"     count(*) AS nn\n"
-        f"   FROM {prev} c CROSS JOIN {od} o\n"
-        f"   GROUP BY c.x + o.dx, c.y + o.dy) n\n"
-        f"LEFT JOIN {prev} p ON p.x = n.x AND p.y = n.y\n"
-        f"WHERE n.nn = 3 OR (n.nn = 2 AND p.x IS NOT NULL)")
-
-
-def _q611_final(g7: str, g8: str, ivd: str, tbl: str,
-                mat: str) -> str:
-    def reg(src, x0, x1, y0, y1):
-        return (f"SELECT x, y FROM {src} WHERE x BETWEEN {x0}"
-                f" AND {x1} AND y BETWEEN {y0} AND {y1}")
-
-    def setresid(name, got, want):
-        # symmetric difference as two parenthesized EXCEPTs —
-        # never chained, so associativity cannot mask a mismatch
-        return (f"{name} AS (SELECT\n"
-                f"           CAST((SELECT count(*) FROM\n"
-                f"             (({got}) EXCEPT ({want})) t1)\n"
-                f"           + (SELECT count(*) FROM\n"
-                f"             (({want}) EXCEPT ({got})) t2)"
-                f" AS BIGINT) AS {name.strip()}_r)")
-    gl_got = reg(g8, 0, 8, 0, 8)
-    gl_want = (f"SELECT x + 2 AS x, y + 2 AS y FROM"
-               f" ({reg(ivd, 0, 8, 0, 8)}) b")
-    bk_got = reg(g8, 9, 12, 1, 4)
-    bk_want = reg(ivd, 9, 12, 1, 4)
-    be_got = reg(g8, 1, 5, 8, 12)
-    be_want = reg(ivd, 1, 5, 8, 12)
-    bo_got = reg(g7, 1, 5, 8, 12)
-    bo_want = (f"SELECT 3 + (y - 10) AS x, 10 + (x - 3) AS y\n"
-               f"             FROM ({reg(ivd, 1, 5, 8, 12)}) b")
-    return (
-        setresid("glv", gl_got, gl_want) + ",\n       "
-        + setresid("bkv", bk_got, bk_want) + ",\n       "
-        + setresid("bev", be_got, be_want) + ",\n       "
-        + setresid("bov", bo_got, bo_want) + ",\n       "
-        + f"dd AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS duo_alive FROM\n"
-        f"           ({reg(g8, 13, 16, 13, 16)}) t),\n"
-        f"       pops AS (SELECT\n"
-        f"           CAST((SELECT count(*) FROM {g7}) AS BIGINT)"
-        f" AS n_live_7,\n"
-        f"           CAST((SELECT count(*) FROM {g8}) AS BIGINT)"
-        f" AS n_live_8),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT g.x, g.y, v.glv_r AS glider_resid,\n"
-        f"       k.bkv_r AS block_resid,\n"
-        f"       e.bev_r AS blink_even_resid,\n"
-        f"       o.bov_r AS blink_odd_resid,\n"
-        f"       d.duo_alive, p.n_live_7, p.n_live_8, l.n_docs\n"
-        f"FROM {g8} g CROSS JOIN glv v CROSS JOIN bkv k\n"
-        f"CROSS JOIN bev e CROSS JOIN bov o CROSS JOIN dd d\n"
-        f"CROSS JOIN pops p CROSS JOIN ld l")
-
-
-def _q611_oracle(tbl: str = "documents") -> str:
-    parts = [_q611_base(tbl)]
-    prev = "g0"
-    for r in range(1, 9):
-        parts.append(f"g{r} AS MATERIALIZED"
-                     f" ({_q611_step(prev, 'od')})")
-        prev = f"g{r}"
-    parts.append(_q611_final("g7", "g8", "ivd", tbl,
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q611_game_of_life", _q611_oracle())
-def q611(spark, sf_dir):
-    """Conway's Game of Life as a round-synchronous relational
-    computation, with each planted pattern's defining theorem
-    checked by exact set algebra (Conway 1970, Gardner's column
-    — THE reference cellular automaton, and the minimal instance
-    of the synchronous-rounds execution model every Pregel-style
-    engine implements).  One generation is one aggregation: the
-    8-offset dim explodes live cells into neighbor increments,
-    a hash count per cell, and B3/S23 as a filter over the count
-    LEFT-JOINed against current life — dead cells never
-    materialize, so the state stays sparse (the sparse-frontier
-    trick that lets the same plan run a 16-cell toy or a
-    billion-cell soup).  Eight generations run; four disjoint
-    regimes certify themselves via EXCEPT in both directions:
-    the GLIDER region at gen 8 equals its initial cells
-    translated by exactly (+2,+2) (glider_resid == 0 — two full
-    periods of the c/4 diagonal spaceship, transport verified
-    cell-for-cell), the BLOCK is a fixed point
-    (block_resid == 0), the BLINKER matches its initial phase at
-    even generations and its 90-degree rotation about the pivot
-    at gen 7 (blink_even/odd_resid == 0 — a genuine period-2
-    oscillator, both phases checked), and the isolated DUO dies
-    of underpopulation (duo_alive == 0).  Populations at gens 7
-    and 8 are emitted; regions are disjoint by construction so
-    the certificates cannot cross-contaminate.  Scale: each
-    round is one groupBy count + one equi-join — state size
-    bounds the cost, not the board."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q611_documents")
-    base = _q611_base("q611_documents")
-    _pin_view(spark, f"WITH {base}\nSELECT * FROM g0", "q611_g0")
-    _pin_view(spark, f"WITH {base}\nSELECT * FROM od", "q611_od")
-    _pin_view(spark, f"WITH {base}\nSELECT * FROM ivd",
-              "q611_ivd")
-    prev = "q611_g0"
-    for r in range(1, 9):
-        _pin_view(spark, _q611_step(prev, "q611_od"),
-                  f"q611_g{r}")
-        prev = f"q611_g{r}"
-    fin = _q611_final("q611_g7", "q611_g8", "q611_ivd",
-                      "q611_documents", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q612: Hamming(7,4) — sphere-packing perfection by exhaustion
-
-
-def _q612_sql(tbl: str, d: str, mat: str) -> str:
-    # codeword bit expressions from nibble n (data at pos 3,5,6,7)
-    db = [f"(n {d} {1 << i}) % 2" for i in range(4)]
-    c = {3: db[0], 5: db[1], 6: db[2], 7: db[3]}
-    c[1] = f"(({c[3]}) + ({c[5]}) + ({c[7]})) % 2"
-    c[2] = f"(({c[3]}) + ({c[6]}) + ({c[7]})) % 2"
-    c[4] = f"(({c[5]}) + ({c[6]}) + ({c[7]})) % 2"
-    cw_cols = ",\n           ".join(
-        f"CAST({c[i]} AS BIGINT) AS c{i}" for i in range(1, 8))
-    pack = lambda p: " + ".join(f"{p}{i}*{1 << (i - 1)}"
-                                for i in range(1, 8))
-    dist = lambda a, b: " + ".join(
-        f"(CASE WHEN {a}.c{i} <> {b}.w{i} THEN 1 ELSE 0 END)"
-        for i in range(1, 8))
-    distcc = lambda a, b: " + ".join(
-        f"(CASE WHEN {a}.c{i} <> {b}.c{i} THEN 1 ELSE 0 END)"
-        for i in range(1, 8))
-    wcols = ",\n           ".join(
-        f"b{i}.x AS w{i}" for i in range(1, 8))
-    wjoin = " CROSS JOIN ".join(f"bd b{i}" for i in range(1, 8))
-    wpack = " + ".join(f"b{i}.x*{1 << (i - 1)}" for i in range(1, 8))
-    # received bits: flip e1 (0 = none), and e2 on the double class
-    r = {i: f"((c.c{i} + (CASE WHEN t.e1 = {i} THEN 1 ELSE 0"
-            f" END) + (CASE WHEN t.e2 = {i} THEN 1 ELSE 0 END))"
-            f" % 2)" for i in range(1, 8)}
-    s1 = f"(({r[1]}) + ({r[3]}) + ({r[5]}) + ({r[7]})) % 2"
-    s2 = f"(({r[2]}) + ({r[3]}) + ({r[6]}) + ({r[7]})) % 2"
-    s4 = f"(({r[4]}) + ({r[5]}) + ({r[6]}) + ({r[7]})) % 2"
-    return (
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       nb AS (SELECT DISTINCT CAST(doc_id % 16"
-        f" AS BIGINT) AS n FROM {tbl}),\n"
-        f"       cw AS{mat} (SELECT n, {cw_cols} FROM nb),\n"
-        f"       cwp AS{mat} (SELECT n, c1, c2, c3, c4, c5, c6,"
-        f" c7,\n"
-        f"           {pack('c')} AS cw FROM cw),\n"
-        f"       wd AS{mat} (SELECT {wcols},\n"
-        f"           {wpack} AS w\n"
-        f"         FROM {wjoin}),\n"
-        f"       sph AS{mat} (SELECT w.w,"
-        f" CAST(count(*) AS BIGINT) AS nc\n"
-        f"         FROM (SELECT w1, w2, w3, w4, w5, w6, w7,\n"
-        f"             w1*1 + w2*2 + w3*4 + w4*8 + w5*16 + w6*32"
-        f" + w7*64 AS w\n"
-        f"           FROM wd) w JOIN cwp c\n"
-        f"           ON ({dist('c', 'w')}) <= 1\n"
-        f"         GROUP BY w.w),\n"
-        f"       spv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN nc <> 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS sphere_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_words"
-        f" FROM sph),\n"
-        f"       mdp AS (SELECT\n"
-        f"           CAST(min({distcc('a', 'b')}) AS BIGINT)"
-        f" AS md_min,\n"
-        f"           CAST(sum(CASE WHEN ({distcc('a', 'b')}) < 3\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS md_lt3\n"
-        f"         FROM cwp a JOIN cwp b ON a.n < b.n),\n"
-        # corpus traffic: encode real nibbles, corrupt, decode
-        f"       tx AS{mat} (SELECT doc_id,\n"
-        f"           CAST(n_chars % 16 AS BIGINT) AS n,\n"
-        f"           CAST(CASE WHEN doc_id % 16 = 5\n"
-        f"             THEN (doc_id % 7) + 1\n"
-        f"             ELSE doc_id % 8 END AS BIGINT) AS e1,\n"
-        f"           CAST(CASE WHEN doc_id % 16 = 5\n"
-        f"             THEN ((doc_id % 7) + 1) % 7 + 1\n"
-        f"             ELSE 0 END AS BIGINT) AS e2\n"
-        f"         FROM {tbl}),\n"
-        f"       dec AS{mat} (SELECT t.doc_id, t.n, t.e1, t.e2,\n"
-        f"           CAST(({s1}) + 2*({s2}) + 4*({s4})"
-        f" AS BIGINT) AS syn,\n"
-        + ",\n".join(
-            f"           CAST({r[i]} AS BIGINT) AS r{i}"
-            for i in range(1, 8)) + "\n"
-        f"         FROM tx t JOIN cwp c ON c.n = t.n),\n"
-        f"       dcp AS{mat} (SELECT doc_id, n, e1, e2, syn,\n"
-        f"           "
-        + " + ".join(
-            f"((r{i} + CASE WHEN syn = {i} THEN 1 ELSE 0 END)"
-            f" % 2)*{1 << (i - 1)}" for i in range(1, 8))
-        + " AS dw\n"
-        f"         FROM dec),\n"
-        f"       vfy AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN d2.e2 = 0 AND"
-        f" d2.dw <> c.cw\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS corr_viol,\n"
-        f"           CAST(sum(CASE WHEN d2.e2 > 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_double,\n"
-        f"           CAST(sum(CASE WHEN d2.e2 > 0 AND"
-        f" d2.dw <> c.cw\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_miscorrected,\n"
-        f"           CAST(sum(CASE WHEN k.cw IS NULL THEN 1"
-        f" ELSE 0 END)\n"
-        f"             AS BIGINT) AS cw_land_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM dcp d2 JOIN cwp c ON c.n = d2.n\n"
-        f"         LEFT JOIN cwp k ON k.cw = d2.dw),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT) AS nd2\n"
-        f"         FROM {tbl})\n"
-        f"SELECT c.n, c.cw,\n"
-        f"       m.md_min, m.md_lt3, s.sphere_viol, s.n_words,\n"
-        f"       v.corr_viol, v.n_double, v.n_miscorrected,\n"
-        f"       v.cw_land_viol, v.n_docs\n"
-        f"FROM cwp c CROSS JOIN mdp m CROSS JOIN spv s\n"
-        f"CROSS JOIN vfy v CROSS JOIN ld l")
-
-
-@query("q612_hamming_perfect_code",
-       "WITH " + _q612_sql("documents", "//", " MATERIALIZED"))
-def q612(spark, sf_dir):
-    """Hamming(7,4) with the perfect-code property proven by
-    exhaustion and the code's failure mode emitted, not hidden
-    (Hamming 1950 — the first error-correcting code, and still
-    the canonical syndrome decoder).  The 16 codewords generate
-    from the real doc-id nibble dim via parity Column
-    expressions; md_min == 3 with md_lt3 == 0 establishes the
-    distance by checking all 120 pairs.  The headline is
-    sphere-packing PERFECTION: all 128 seven-bit words
-    materialize (7-way parity cross join) and every single one
-    lies within Hamming distance 1 of EXACTLY one codeword
-    (sphere_viol == 0, n_words == 128) — the 16 radius-1 spheres
-    of size 8 tile F_2^7 with no gap and no overlap, which is
-    the definition of a perfect code, verified word by word.
-    Real traffic then flows: each document's n_chars nibble is
-    encoded, corrupted per its doc-id class (clean, single-bit
-    flip at any of the 7 positions, or — on the doc_id%16 == 5
-    class — a DOUBLE flip), and syndrome-decoded entirely in
-    column arithmetic (the syndrome literally names the flipped
-    position — Hamming's design).  corr_viol == 0 over every
-    clean and single-error document is the correction guarantee;
-    the double-error class shows the guarantee's exact boundary:
-    all n_double documents MIScorrect (n_miscorrected ==
-    n_double), yet cw_land_viol == 0 — the decoder always lands
-    ON a codeword, just the wrong one, exactly what distance 3
-    promises and no more.  Scale: dims are broadcast-size; the
-    per-doc path is pure expression work plus one 16-row
-    broadcast lookup."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q612_documents")
-    return spark.sql(
-        "WITH " + _q612_sql("q612_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q613: Burnside's lemma — necklaces and bracelets by exhaustion
-
-
-def _q613_sql(tbl: str, d: str, mat: str) -> str:
-    cols = ", ".join(f"b{i}.x AS c{i}" for i in range(12))
-    joins = " CROSS JOIN ".join(f"bd b{i}" for i in range(12))
-    sval = " + ".join(f"b{i}.x*{1 << i}" for i in range(12))
-    rval = " + ".join(f"b{i}.x*{1 << (11 - i)}" for i in range(12))
-    rk = ", ".join(f"({k}, {1 << k}, {1 << (12 - k)})"
-                   for k in range(12))
-    dv = ", ".join(f"({x})" for x in range(1, 13))
-    rot = lambda s: (f"((({s})*r.p) % 4096) + (({s}) {d} r.q)")
-    return (
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       sx AS{mat} (SELECT {sval} AS s, {rval} AS rv\n"
-        f"         FROM {joins}),\n"
-        f"       rd AS (SELECT CAST(k AS BIGINT) AS k,"
-        f" CAST(p AS BIGINT) AS p,\n"
-        f"           CAST(q AS BIGINT) AS q\n"
-        f"         FROM (VALUES {rk}) t(k, p, q)),\n"
-        f"       dv AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES {dv}) t(x)),\n"
-        # canonical forms under rotation and under the dihedral
-        f"       cn AS{mat} (SELECT x.s,\n"
-        f"           min({rot('x.s')}) AS canr,\n"
-        f"           least(min({rot('x.s')}),"
-        f" min({rot('x.rv')})) AS cand\n"
-        f"         FROM sx x CROSS JOIN rd r GROUP BY x.s),\n"
-        f"       orb AS (SELECT\n"
-        f"           CAST(count(DISTINCT canr) AS BIGINT)"
-        f" AS n_necklaces,\n"
-        f"           CAST(count(DISTINCT cand) AS BIGINT)"
-        f" AS n_bracelets FROM cn),\n"
-        # Burnside ingredients: fixed points of each rotation,
-        # with gcd computed from a divisor dim
-        f"       fx AS{mat} (SELECT r.k,\n"
-        f"           CAST(sum(CASE WHEN {rot('x.s')} = x.s"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS fixed\n"
-        f"         FROM sx x CROSS JOIN rd r GROUP BY r.k),\n"
-        f"       gc AS (SELECT r.k, CAST(max(d2.x) AS BIGINT)"
-        f" AS g\n"
-        f"         FROM rd r JOIN dv d2\n"
-        f"           ON r.k % d2.x = 0 AND 12 % d2.x = 0\n"
-        f"         GROUP BY r.k),\n"
-        f"       pw AS (SELECT x.s FROM sx x),\n"
-        f"       fxv AS (SELECT CAST(sum(CASE WHEN f.fixed <>\n"
-        f"           CASE g.g WHEN 1 THEN 2 WHEN 2 THEN 4"
-        f" WHEN 3 THEN 8\n"
-        f"             WHEN 4 THEN 16 WHEN 6 THEN 64"
-        f" WHEN 12 THEN 4096\n"
-        f"             ELSE -1 END THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS fixed_viol,\n"
-        f"           CAST(sum(f.fixed) AS BIGINT) AS rot_fixed\n"
-        f"         FROM fx f JOIN gc g ON g.k = f.k),\n"
-        # reflections: fixed pairs (s, j) with rot_j(rev(s)) == s
-        f"       rf AS (SELECT CAST(sum(CASE WHEN"
-        f" {rot('x.rv')} = x.s\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS refl_fixed\n"
-        f"         FROM sx x CROSS JOIN rd r),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT f.k, g.g AS gcd_k, f.fixed,\n"
-        f"       o.n_necklaces, v.rot_fixed,\n"
-        f"       v.rot_fixed {d} 12 AS burnside_necklaces,\n"
-        f"       v.rot_fixed % 12 AS neck_rem,\n"
-        f"       o.n_necklaces - v.rot_fixed {d} 12"
-        f" AS neck_resid,\n"
-        f"       o.n_bracelets, r2.refl_fixed,\n"
-        f"       (v.rot_fixed + r2.refl_fixed) {d} 24"
-        f" AS burnside_bracelets,\n"
-        f"       (v.rot_fixed + r2.refl_fixed) % 24"
-        f" AS brac_rem,\n"
-        f"       o.n_bracelets - (v.rot_fixed + r2.refl_fixed)"
-        f" {d} 24 AS brac_resid,\n"
-        f"       v.fixed_viol, l.n_docs\n"
-        f"FROM fx f JOIN gc g ON g.k = f.k\n"
-        f"CROSS JOIN orb o CROSS JOIN fxv v CROSS JOIN rf r2\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q613_burnside_necklaces",
-       "WITH " + _q613_sql("documents", "//", " MATERIALIZED"))
-def q613(spark, sf_dir):
-    """Burnside's lemma with BOTH sides computed independently
-    (Burnside 1897, Pólya 1937 — the orbit-counting identity
-    behind every 'how many distinct configurations up to
-    symmetry' question: canonical forms, deduplication under
-    transforms, graph canonization).  The full universe of
-    2-colored 12-bead necklaces — 4096 strings from a 12-way
-    cross join of the doc-parity dim — is counted two ways that
-    share no machinery: (left side) EXHAUSTIVE canonicalization,
-    each string mapped to its minimum over all 12 rotations
-    (div/mod shifts) and distinct canons counted; (right side)
-    the lemma's average-fixed-points formula, with each
-    rotation's fixed-point count measured by literally testing
-    rot_k(s) == s on all 4096 strings.  neck_resid == 0 ties
-    them: 352 necklaces both ways, with neck_rem == 0 showing
-    the 'average' is exact — divisibility is part of the lemma.
-    The per-rotation ingredient is itself a theorem and is
-    verified per k: fixed(rot_k) == 2^gcd(k,12), with gcd
-    computed relationally from a divisor dim (fixed_viol == 0
-    across all 12 rotations — the cycle-index structure, not a
-    citation).  The dihedral group runs in the same plan: the
-    bit-reversal column gives reflections, canonical form
-    under all 24 symmetries yields n_bracelets == 224, and
-    refl_fixed (1152, measured) completes Burnside for D12
-    (brac_resid == 0, brac_rem == 0).  Scale: one generated
-    cross join + grouped aggregations — the canonicalize-then-
-    distinct shape IS distributed dedup-under-symmetry."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q613_documents")
-    return spark.sql(
-        "WITH " + _q613_sql("q613_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q614: min-cost max flow — successive shortest paths vs exhaustion
-
-
-# No antiparallel or parallel edge pairs, so (u,v) names a unique
-# residual arc (the q599 discipline).  s = 0, t = 5.
-_Q614_EDGES = [(0, 0, 1, 1, 1), (1, 1, 2, 1, 1), (2, 2, 5, 1, 1),
-               (3, 0, 2, 1, 5), (4, 1, 5, 1, 20),
-               (5, 0, 3, 1, 2), (6, 3, 4, 1, 2), (7, 4, 5, 2, 2)]
-_Q614_ROUNDS = 4
-
-
-def _q614_dims(tbl: str) -> str:
-    eg = ", ".join(f"({i}, {u}, {v}, {c}, {w})"
-                   for i, u, v, c, w in _Q614_EDGES)
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 6 AS BIGINT)"
-        f" AS v FROM {tbl}),\n"
-        f"       eg AS (SELECT CAST(i AS BIGINT) AS i,"
-        f" CAST(u AS BIGINT) AS u,\n"
-        f"           CAST(v AS BIGINT) AS v, CAST(c AS BIGINT)"
-        f" AS cap,\n"
-        f"           CAST(w AS BIGINT) AS w\n"
-        f"         FROM (VALUES {eg}) t(i, u, v, c, w)),\n"
-        f"       fd AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES (0), (1), (2)) t(x)),\n"
-        f"       f0 AS (SELECT i, u, v, cap, w, CAST(0 AS BIGINT)"
-        f" AS fl FROM eg)")
-
-
-def _q614_round(r: int, fp: str, nd: str) -> list:
-    out = [
-        f"rs{r} AS (SELECT u, v, cap - fl AS rc, w AS rw"
-        f" FROM {fp}\n"
-        f"         WHERE cap - fl > 0\n"
-        f"         UNION ALL\n"
-        f"         SELECT v, u, fl, -w FROM {fp} WHERE fl > 0)",
-        f"c{r}_0 AS (SELECT v AS a, v AS b, CAST(0 AS BIGINT)"
-        f" AS d FROM {nd}\n"
-        f"         UNION ALL SELECT u, v, rw FROM rs{r})"]
-    for k in range(1, 4):
-        out.append(
-            f"c{r}_{k} AS (SELECT a, b, min(d) AS d FROM (\n"
-            f"         SELECT a, b, d FROM c{r}_{k - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT x.a, y.b, x.d + y.d\n"
-            f"         FROM c{r}_{k - 1} x JOIN c{r}_{k - 1} y\n"
-            f"           ON y.a = x.b) t GROUP BY a, b)")
-    out.append(
-        f"ds{r} AS (SELECT b AS n, d FROM c{r}_3 WHERE a = 0)")
-    out.append(
-        f"pv{r} AS (SELECT t.n, t.d,\n"
-        f"           CAST(coalesce(min(r2.u), -1) AS BIGINT)"
-        f" AS par\n"
-        f"         FROM ds{r} t LEFT JOIN\n"
-        f"           (SELECT r.u, r.v, r.rw, q.d FROM rs{r} r\n"
-        f"            JOIN ds{r} q ON q.n = r.u) r2\n"
-        f"           ON r2.v = t.n AND r2.d + r2.rw = t.d\n"
-        f"         GROUP BY t.n, t.d)")
-    walk = [f"w{r}_0 AS (SELECT n, par FROM pv{r} WHERE n = 5"
-            f" AND par >= 0)"]
-    for j in range(1, 5):
-        walk.append(
-            f"w{r}_{j} AS (SELECT v.n, v.par\n"
-            f"         FROM w{r}_{j - 1} p JOIN pv{r} v\n"
-            f"           ON v.n = p.par AND v.par >= 0"
-            f" AND p.par <> 0)")
-    out.extend(walk)
-    uw = "\n         UNION ALL\n         ".join(
-        f"SELECT n, par FROM w{r}_{j}" for j in range(5))
-    out.append(f"pw{r} AS (SELECT n, par FROM (\n"
-               f"         {uw}) t)")
-    out.append(
-        f"dt{r} AS (SELECT CAST(coalesce(min(r.rc), 0)"
-        f" AS BIGINT) AS dd\n"
-        f"         FROM pw{r} p JOIN rs{r} r\n"
-        f"           ON r.u = p.par AND r.v = p.n)")
-    out.append(
-        f"dl{r} AS (SELECT CAST({r} AS BIGINT) AS rnd, d.dd,\n"
-        f"           coalesce(t.d, 0) AS dist_t, b.nb\n"
-        f"         FROM dt{r} d\n"
-        f"         LEFT JOIN ds{r} t ON t.n = 5\n"
-        f"         CROSS JOIN\n"
-        f"           (SELECT CAST(count(*) AS BIGINT) AS nb\n"
-        f"            FROM pw{r} p JOIN {fp} e\n"
-        f"              ON e.u = p.n AND e.v = p.par) b)")
-    out.append(
-        f"f{r} AS (SELECT f.i, f.u, f.v, f.cap, f.w,\n"
-        f"           f.fl + d.dd * (CASE WHEN pf.n IS NOT NULL\n"
-        f"             THEN 1 ELSE 0 END)\n"
-        f"             - d.dd * (CASE WHEN pb.n IS NOT NULL\n"
-        f"             THEN 1 ELSE 0 END) AS fl\n"
-        f"         FROM {fp} f CROSS JOIN dt{r} d\n"
-        f"         LEFT JOIN pw{r} pf ON pf.par = f.u"
-        f" AND pf.n = f.v\n"
-        f"         LEFT JOIN pw{r} pb ON pb.par = f.v"
-        f" AND pb.n = f.u)")
-    return out
-
-
-def _q614_final(fF: str, rsF: str, clF: str, dla: str, nd: str,
-                fd: str, eg: str, tbl: str, d: str,
-                mat: str) -> str:
-    # exhaustive enumeration of all integer flows, edge by edge
-    parts = [f"x0 AS (SELECT CAST(0 AS BIGINT) AS dummy"
-             f" FROM {nd} WHERE v = 0)"]
-    for i in range(8):
-        cols = ", ".join(f"g{j}" for j in range(i))
-        sel = (cols + ", " if cols else "")
-        parts.append(
-            f"x{i + 1} AS (SELECT {sel}f.x AS g{i}\n"
-            f"         FROM x{i} x JOIN {eg} e ON e.i = {i}\n"
-            f"         JOIN {fd} f ON f.x <= e.cap)")
-    # conservation at internal nodes 1..4
-    cons = []
-    for node in range(1, 5):
-        inn = " + ".join(f"g{i}" for i, (_, u, v, c, w)
-                         in enumerate(_Q614_EDGES) if v == node)
-        out = " + ".join(f"g{i}" for i, (_, u, v, c, w)
-                         in enumerate(_Q614_EDGES) if u == node)
-        cons.append(f"({inn or '0'}) = ({out or '0'})")
-    val = " + ".join(f"g{i}" for i, (_, u, v, c, w)
-                     in enumerate(_Q614_EDGES) if u == 0)
-    cst = " + ".join(f"g{i}*{w}" for i, (_, u, v, c, w)
-                     in enumerate(_Q614_EDGES))
-    parts.append(
-        f"fe AS{mat} (SELECT {val} AS val, {cst} AS cost\n"
-        f"         FROM x8 WHERE " + "\n           AND ".join(cons)
-        + ")")
-    parts.append(
-        f"exh AS (SELECT\n"
-        f"           CAST((10 - min((10 - val)*100000 + cost))"
-        f" {d} 100000 AS BIGINT) AS exh_val_key,\n"
-        f"           CAST(min((10 - val)*100000 + cost) % 100000"
-        f" AS BIGINT) AS exh_cost,\n"
-        f"           CAST(10 - min((10 - val)*100000 + cost)"
-        f" {d} 100000 AS BIGINT) AS exh_val,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_feasible\n"
-        f"         FROM fe)")
-    parts.append(
-        f"vl AS (SELECT CAST(sum(CASE WHEN u = 0 THEN fl ELSE 0"
-        f" END) AS BIGINT) AS val,\n"
-        f"           CAST(sum(fl*w) AS BIGINT) AS cost"
-        f" FROM {fF})")
-    parts.append(
-        f"ngd AS (SELECT CAST(coalesce(min(d), 0) AS BIGINT)"
-        f" AS neg_diag\n"
-        f"         FROM {clF} WHERE a = b)")
-    parts.append(
-        f"agr AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN cur.dd > 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_rounds_aug,\n"
-        f"           CAST(sum(CASE WHEN cur.dd > 0 AND cur.nb > 0 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT)"
-        f" AS n_backward_aug,\n"
-        f"           CAST(sum(cur.dd*cur.dist_t) AS BIGINT)"
-        f" AS telescope,\n"
-        f"           CAST(sum(CASE WHEN nxt.dist_t < cur.dist_t\n"
-        f"             AND nxt.dd > 0 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS mono_viol\n"
-        f"         FROM {dla} cur LEFT JOIN {dla} nxt\n"
-        f"           ON nxt.rnd = cur.rnd + 1)")
-    parts.append(
-        f"cns AS (SELECT CAST(sum(CASE WHEN t.net <> 0 THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS cons_viol,\n"
-        f"           CAST(sum(CASE WHEN t.cap_bad > 0 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS cap_viol\n"
-        f"         FROM (SELECT n.v,\n"
-        f"             sum(CASE WHEN f.v = n.v THEN f.fl"
-        f" ELSE 0 END)\n"
-        f"             - sum(CASE WHEN f.u = n.v THEN f.fl"
-        f" ELSE 0 END) AS net,\n"
-        f"             max(CASE WHEN f.fl < 0 OR f.fl > f.cap\n"
-        f"               THEN 1 ELSE 0 END) AS cap_bad\n"
-        f"           FROM {nd} n CROSS JOIN {fF} f\n"
-        f"           WHERE n.v NOT IN (0, 5)"
-        f" GROUP BY n.v) t)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs\n"
-        f"         FROM {tbl})")
-    fin = (
-        f"SELECT f.i, f.u, f.v, f.cap, f.w, f.fl,\n"
-        f"       v.val, v.cost, x.exh_val, x.exh_cost,\n"
-        f"       v.val - x.exh_val AS val_resid,\n"
-        f"       v.cost - x.exh_cost AS cost_resid,\n"
-        f"       x.n_feasible, n.neg_diag,\n"
-        f"       a.n_rounds_aug, a.n_backward_aug,\n"
-        f"       a.telescope, a.telescope - v.cost"
-        f" AS telescope_resid,\n"
-        f"       a.mono_viol, c.cons_viol, c.cap_viol,"
-        f" l.n_docs\n"
-        f"FROM {fF} f CROSS JOIN vl v CROSS JOIN exh x\n"
-        f"CROSS JOIN ngd n CROSS JOIN agr a CROSS JOIN cns c\n"
-        f"CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q614_oracle(tbl: str = "documents") -> str:
-    parts = [_q614_dims(tbl)]
-    fp = "f0"
-    for r in range(1, _Q614_ROUNDS + 1):
-        for fr in _q614_round(r, fp, "nd"):
-            nm, body = fr.split(" AS ", 1)
-            parts.append(f"{nm} AS MATERIALIZED {body.strip()}")
-        fp = f"f{r}"
-    dla = "\n         UNION ALL ".join(
-        f"SELECT * FROM dl{r}" for r in range(1, _Q614_ROUNDS + 1))
-    parts.append(f"dla AS MATERIALIZED ({dla})")
-    # final-residual closure for the Klein check
-    parts.append(
-        f"rsf AS MATERIALIZED (SELECT u, v, cap - fl AS rc,"
-        f" w AS rw FROM f{_Q614_ROUNDS}\n"
-        f"       WHERE cap - fl > 0\n"
-        f"       UNION ALL SELECT v, u, fl, -w"
-        f" FROM f{_Q614_ROUNDS} WHERE fl > 0)")
-    parts.append(
-        "k0 AS MATERIALIZED (SELECT v AS a, v AS b,"
-        " CAST(0 AS BIGINT) AS d FROM nd\n"
-        "       UNION ALL SELECT u, v, rw FROM rsf)")
-    prev = "k0"
-    for k in range(1, 4):
-        parts.append(
-            f"k{k} AS MATERIALIZED (SELECT a, b, min(d) AS d"
-            f" FROM (\n"
-            f"       SELECT a, b, d FROM {prev}\n"
-            f"       UNION ALL SELECT x.a, y.b, x.d + y.d\n"
-            f"       FROM {prev} x JOIN {prev} y ON y.a = x.b) t\n"
-            f"       GROUP BY a, b)")
-        prev = f"k{k}"
-    fparts, fin = _q614_final(f"f{_Q614_ROUNDS}", "rsf", "k3",
-                              "dla", "nd", "fd", "eg", tbl, "//",
-                              " MATERIALIZED")
-    for fr in fparts:
-        nm, body = fr.split(" AS ", 1)
-        if body.startswith("MATERIALIZED"):
-            parts.append(fr)
-        else:
-            parts.append(f"{nm} AS MATERIALIZED {body.strip()}")
-    return "WITH " + ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q614_min_cost_flow", _q614_oracle())
-def q614(spark, sf_dir):
-    """Min-cost max flow by successive shortest paths, certified
-    by TOTAL exhaustion over the flow polytope's integer points
-    (Jewell 1958, Busacker-Gowen 1960; Klein 1967 for the
-    optimality criterion — the cost-aware sibling of q599, and
-    the algorithm behind every 'cheapest way to move all the
-    data' plan).  Each round is fully relational: the residual
-    graph carries COSTS (backward arcs at -w), shortest path by
-    cost via 3 min-plus doubling stages, parents by the
-    dist(u) + w == dist(v) tightness rule with the tie packed,
-    the path walked from t, and the flow update as two LEFT
-    JOINs.  Three rounds augment at distances 3, 6, 24 — and
-    round 3 traverses the residual arc 2->1 BACKWARD
-    (n_backward_aug == 1), cancelling round 1's flow on edge
-    1->2 (its final flow is 0 despite being on the first path):
-    without that cancellation the cheap first path permanently
-    blocks the bottleneck, which is exactly why greedy path
-    packing is not an algorithm.  Round 4 proves termination.
-    The verdict is then checked against EVERYTHING: all 384
-    integer flow vectors materialize (8 chained per-edge joins
-    bounded by capacity), conservation filters them to
-    n_feasible points, and the packed lexicographic
-    (max value, min cost) optimum must equal SSP's result
-    (val_resid == cost_resid == 0) — the strongest certificate a
-    small polytope admits.  Independently, Klein's criterion
-    holds: the final residual graph's min-plus closure has no
-    negative diagonal (neg_diag == 0 — no negative cycle, the
-    local optimality test that scales when exhaustion cannot).
-    The SSP theory rides the output: distances never decrease
-    across rounds (mono_viol == 0) and total cost telescopes to
-    sum of delta x dist (telescope_resid == 0), plus
-    conservation and capacity checks.  Scale: rounds are
-    O(log diameter) joins; the exhaustion is fixture-bounded and
-    exists to certify, not to run at scale — Klein's check is
-    the scalable one, and both are in the plan."""
-    # Round-5 restructure (the q599/q593 precedent): the former
-    # ~30 pin roundtrips ran the SSP rounds over an 8-edge LITERAL
-    # network; the rounds now execute driver-side mirroring the
-    # oracle's spec arc-for-arc (cost-carrying residuals, min-plus
-    # distances bounded at 8 arcs, tightness-rule parents with the
-    # min-u tie, the guarded walk, two-sided update), while every
-    # CERTIFICATE — the 384-point flow-polytope exhaustion, Klein's
-    # no-negative-cycle closure diagonal, telescoping/monotonicity,
-    # conservation/capacity — stays relational in the one audited
-    # statement.
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q614_documents")
-    dims = _q614_dims("q614_documents")
-    _pin_view(spark, f"WITH {dims} SELECT * FROM nd", "q614_nd")
-    local_df(spark, [(i, u, v, c, w)
-                     for i, u, v, c, w in _Q614_EDGES],
-             "i long, u long, v long, cap long, w long") \
-        .createOrReplaceTempView("q614_eg")
-    local_df(spark, [(0,), (1,), (2,)], "x long") \
-        .createOrReplaceTempView("q614_fd")
-    nodes = list(range(6))
-    cap = {(u, v): c for _i, u, v, c, _w in _Q614_EDGES}
-    wgt = {(u, v): w for _i, u, v, _c, w in _Q614_EDGES}
-    fl = {(u, v): 0 for _i, u, v, _c, _w in _Q614_EDGES}
-    INF = 10 ** 9
-    dla_rows = []
-    for r in range(1, _Q614_ROUNDS + 1):
-        rs = ([(u, v, cap[u, v] - fl[u, v], wgt[u, v])
-               for (u, v) in fl if cap[u, v] - fl[u, v] > 0]
-              + [(v, u, fl[u, v], -wgt[u, v])
-                 for (u, v) in fl if fl[u, v] > 0])
-        # min-plus closure from 0, walks bounded at 2^3 arcs
-        k = {(v, v): 0 for v in nodes}
-        for u, v, _rc, rw in rs:
-            k[(u, v)] = min(k.get((u, v), INF), rw)
-        for _ in range(3):
-            nk = dict(k)
-            for (a, b1), d1 in k.items():
-                for (b2, c2), d2 in k.items():
-                    if b2 == b1 and d1 + d2 < nk.get((a, c2), INF):
-                        nk[(a, c2)] = d1 + d2
-            k = nk
-        ds = {b: d for (a, b), d in k.items() if a == 0}
-        par = {}
-        for n in ds:
-            cands = [u for u, v, _rc, rw in rs
-                     if v == n and u in ds and ds[u] + rw == ds[n]]
-            par[n] = min(cands) if cands else -1
-        pw = []
-        if par.get(5, -1) >= 0:
-            cur = (5, par[5])
-            pw.append(cur)
-            for _j in range(1, 5):
-                p_n, p_par = cur
-                if p_par == 0 or par.get(p_par, -1) < 0:
-                    break
-                cur = (p_par, par[p_par])
-                pw.append(cur)
-        pwset = set(pw)
-        match = [rc for u, v, rc, _rw in rs if (v, u) in pwset]
-        dd = min(match) if match else 0
-        nb = sum(1 for n, p in pw if (n, p) in cap)
-        dla_rows.append((r, dd, ds.get(5, 0), nb))
-        for u, v in fl:
-            if (v, u) in pwset:
-                fl[u, v] += dd
-            if (u, v) in pwset:
-                fl[u, v] -= dd
-    local_df(spark,
-             [(i, u, v, c, w, fl[u, v])
-              for i, u, v, c, w in _Q614_EDGES],
-             "i long, u long, v long, cap long, w long, fl long") \
-        .createOrReplaceTempView(f"q614_f{_Q614_ROUNDS}")
-    rsf = ([(u, v, cap[u, v] - fl[u, v], wgt[u, v])
-            for (u, v) in fl if cap[u, v] - fl[u, v] > 0]
-           + [(v, u, fl[u, v], -wgt[u, v])
-              for (u, v) in fl if fl[u, v] > 0])
-    local_df(spark, rsf, "u long, v long, rc long, rw long") \
-        .createOrReplaceTempView("q614_rsf")
-    k = {(v, v): 0 for v in nodes}
-    for u, v, _rc, rw in rsf:
-        k[(u, v)] = min(k.get((u, v), INF), rw)
-    for _ in range(3):
-        nk = dict(k)
-        for (a, b1), d1 in k.items():
-            for (b2, c2), d2 in k.items():
-                if b2 == b1 and d1 + d2 < nk.get((a, c2), INF):
-                    nk[(a, c2)] = d1 + d2
-        k = nk
-    local_df(spark, sorted((a, b, d) for (a, b), d in k.items()),
-             "a long, b long, d long") \
-        .createOrReplaceTempView("q614_k3")
-    local_df(spark, dla_rows,
-             "rnd long, dd long, dist_t long, nb long") \
-        .createOrReplaceTempView("q614_dla")
-    fparts, fin = _q614_final(f"q614_f{_Q614_ROUNDS}", "q614_rsf",
-                              "q614_k3", "q614_dla", "q614_nd",
-                              "q614_fd", "q614_eg",
-                              "q614_documents", "div", "")
-    return spark.sql("WITH " + ",\n       ".join(fparts)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q615: reflected Gray code — Hamilton cycle on Q8 by exhaustion
-
-
-def _q615_sql(tbl: str, d: str, mat: str) -> str:
-    # G(n) = n XOR (n >> 1), bitwise via div/mod (8 bits)
-    def bit(e, k):
-        return f"(({e}) {d} {1 << k}) % 2"
-    gexpr = " + ".join(
-        f"((({bit('n', k)}) + ({bit('n', k + 1) if k < 7 else '0'}))"
-        f" % 2)*{1 << k}" for k in range(8))
-    # inverse: i_k = XOR of g_j for j >= k (prefix XOR from the top)
-    iexpr = " + ".join(
-        "((" + " + ".join(bit("g", j) for j in range(k, 8))
-        + f") % 2)*{1 << k}" for k in range(8))
-    ham = lambda a, b: " + ".join(
-        f"((({bit(a, k)}) + ({bit(b, k)})) % 2)" for k in range(8))
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 256 AS BIGINT)"
-        f" AS n FROM {tbl}),\n"
-        f"       cv AS (SELECT CAST(count(*) AS BIGINT) AS cov\n"
-        f"         FROM nd),\n"
-        f"       gr AS{mat} (SELECT n, CAST({gexpr} AS BIGINT)"
-        f" AS g FROM nd),\n"
-        f"       iv AS{mat} (SELECT n, g,\n"
-        f"           CAST({iexpr} AS BIGINT) AS back FROM gr),\n"
-        f"       bij AS (SELECT\n"
-        f"           CAST(count(DISTINCT g) AS BIGINT)"
-        f" AS n_distinct,\n"
-        f"           CAST(sum(CASE WHEN back <> n THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS inverse_viol FROM iv),\n"
-        # Hamilton cycle on Q8: consecutive codes differ in
-        # EXACTLY one bit, including the wraparound edge
-        f"       adj AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           ({ham('a.g', 'b.g')}) <> 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS adj_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_steps\n"
-        f"         FROM gr a JOIN gr b"
-        f" ON b.n = (a.n + 1) % 256),\n"
-        # the reflect-and-prefix construction: within each block
-        # [0, 2^k), the second half mirrors the first with the
-        # top bit set — verified for every k and every i
-        f"       rfl AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           hi.g <> lo.g + pw.p\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT) AS refl_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_refl\n"
-        f"         FROM (SELECT CAST(k AS BIGINT) AS k,"
-        f" CAST(p AS BIGINT) AS p FROM (VALUES\n"
-        f"           (1, 1), (2, 2), (3, 4), (4, 8), (5, 16),"
-        f" (6, 32), (7, 64), (8, 128)) t(k, p)) pw\n"
-        f"         JOIN gr lo ON lo.n < pw.p\n"
-        f"         JOIN gr hi ON hi.n = 2*pw.p - 1 - lo.n),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT i.n, i.g, i.back,\n"
-        f"       b.n_distinct, b.inverse_viol,\n"
-        f"       a.adj_viol, a.n_steps, r.refl_viol, r.n_refl,\n"
-        f"       c.cov, l.n_docs\n"
-        f"FROM iv i CROSS JOIN bij b CROSS JOIN adj a\n"
-        f"CROSS JOIN rfl r CROSS JOIN cv c CROSS JOIN ld l")
-
-
-@query("q615_gray_code",
-       "WITH " + _q615_sql("documents", "//", " MATERIALIZED"))
-def q615(spark, sf_dir):
-    """Reflected binary Gray code with every defining property
-    checked over the whole domain (Gray 1953; the sequencing
-    trick behind rotary encoders, Karnaugh maps, and
-    minimal-change enumeration).  The domain is the real doc-id
-    residues (cov == 256 certifies full coverage); G(n) = n XOR
-    (n >> 1) is pure div/mod column arithmetic, and its inverse
-    — the top-down prefix XOR — is computed as a second
-    expression, with inverse_viol == 0 proving the roundtrip on
-    all 256 values and n_distinct == 256 the bijection.  The
-    headline is the HAMILTON CYCLE on the 8-cube: consecutive
-    codes (including the 255 -> 0 wraparound) differ in EXACTLY
-    one bit — adj_viol == 0 over all 256 cyclic steps, each
-    step's Hamming distance computed bit by bit.  The recursive
-    reflect-and-prefix construction is verified structurally:
-    for every block size 2^k and every i, the code at
-    2^k + (2^k - 1 - i) ... i.e. the mirrored upper half equals
-    the lower half plus the new top bit (refl_viol == 0 over all
-    n_refl == 255 mirror pairs across all 8 levels) — the
-    reflection that gives the code its name, checked at every
-    scale.  Scale: one corpus scan seeds the dim; everything
-    else is broadcast expression work."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q615_documents")
-    return spark.sql(
-        "WITH " + _q615_sql("q615_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q616: matrix-chain DP vs full parenthesization enumeration
-
-
-_Q616_P = [14, 15, 3, 10, 18, 17, 14]
-
-
-def _q616_base(tbl: str) -> str:
-    pd = ", ".join(f"({i}, {p})" for i, p in enumerate(_Q616_P))
-    return (
-        f"pd AS (SELECT CAST(i AS BIGINT) AS i, CAST(p AS"
-        f" BIGINT) AS p\n"
-        f"         FROM (VALUES {pd}) t(i, p)),\n"
-        f"       iv AS (SELECT DISTINCT CAST(doc_id % 6"
-        f" AS BIGINT) AS i FROM {tbl}),\n"
-        f"       en1 AS (SELECT i, i AS j, CAST(0 AS BIGINT)"
-        f" AS cost FROM iv),\n"
-        f"       dp1 AS (SELECT i, j, cost FROM en1)")
-
-
-def _q616_stage(l: int, acc: str, pd: str, minify: bool) -> str:
-    core = (
-        f"SELECT a.i, b.j,\n"
-        f"           a.cost + b.cost + pi.p*pk.p*pj.p AS cost\n"
-        f"         FROM {acc} a JOIN {acc} b ON b.i = a.j + 1\n"
-        f"           AND (a.j - a.i) + (b.j - b.i) = {l - 2}\n"
-        f"         JOIN {pd} pi ON pi.i = a.i\n"
-        f"         JOIN {pd} pk ON pk.i = b.i\n"
-        f"         JOIN {pd} pj ON pj.i = b.j + 1")
-    if minify:
-        return (f"SELECT i, j, min(cost) AS cost FROM ({core}) t\n"
-                f"         GROUP BY i, j")
-    return core
-
-
-def _q616_final(en: str, dp: str, pd: str, tbl: str,
-                mat: str) -> str:
-    cat = ", ".join(f"({l}, {c})" for l, c in
-                    [(1, 1), (2, 1), (3, 2), (4, 5), (5, 14),
-                     (6, 42)])
-    return (
-        f"cat AS (SELECT CAST(l AS BIGINT) AS l, CAST(c AS"
-        f" BIGINT) AS c\n"
-        f"         FROM (VALUES {cat}) t(l, c)),\n"
-        f"       cnt AS{mat} (SELECT e.j - e.i + 1 AS l,\n"
-        f"           e.i, CAST(count(*) AS BIGINT) AS n_trees,\n"
-        f"           CAST(min(e.cost) AS BIGINT) AS best\n"
-        f"         FROM {en} e GROUP BY e.j - e.i + 1, e.i,"
-        f" e.j),\n"
-        f"       cvl AS (SELECT CAST(sum(CASE WHEN t.n_trees <>"
-        f" c.c\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS catalan_viol,\n"
-        f"           CAST(sum(CASE WHEN d2.cost <> t.best"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS dp_resid\n"
-        f"         FROM cnt t JOIN cat c ON c.l = t.l\n"
-        f"         JOIN {dp} d2 ON d2.i = t.i\n"
-        f"           AND d2.j = t.i + t.l - 1)",
-        f"       opt AS (SELECT CAST(cost AS BIGINT) AS opt\n"
-        f"         FROM {dp} WHERE i = 0 AND j = 5),\n"
-        f"       lra AS (SELECT\n"
-        f"           CAST(sum(p0.p*pk.p*pk1.p) AS BIGINT)"
-        f" AS left_cost,\n"
-        f"           CAST(sum(pk0.p*pk.p*p6.p) AS BIGINT)"
-        f" AS right_cost\n"
-        f"         FROM {pd} pk\n"
-        f"         JOIN {pd} pk1 ON pk1.i = pk.i + 1\n"
-        f"         JOIN {pd} pk0 ON pk0.i = pk.i - 1\n"
-        f"         JOIN {pd} p0 ON p0.i = 0\n"
-        f"         JOIN {pd} p6 ON p6.i = 6\n"
-        f"         WHERE pk.i BETWEEN 1 AND 5),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT t.l, t.i, t.n_trees, t.best,\n"
-        f"       o.opt, v.catalan_viol, v.dp_resid,\n"
-        f"       r.left_cost, r.right_cost,\n"
-        f"       r.left_cost - o.opt AS left_gap,\n"
-        f"       r.right_cost - o.opt AS right_gap, l2.n_docs\n"
-        f"FROM cnt t CROSS JOIN opt o CROSS JOIN cvl v\n"
-        f"CROSS JOIN lra r CROSS JOIN ld l2")
-
-
-def _q616_oracle(tbl: str = "documents") -> str:
-    parts = [_q616_base(tbl)]
-    enp, dpp = "en1", "dp1"
-    for l in range(2, 7):
-        parts.append(
-            f"en{l} AS MATERIALIZED (SELECT * FROM {enp}\n"
-            f"       UNION ALL\n"
-            f"       {_q616_stage(l, enp, 'pd', False)})")
-        parts.append(
-            f"dp{l} AS MATERIALIZED (SELECT * FROM {dpp}\n"
-            f"       UNION ALL\n"
-            f"       {_q616_stage(l, dpp, 'pd', True)})")
-        enp, dpp = f"en{l}", f"dp{l}"
-    cvl, rest = _q616_final(enp, dpp, "pd", tbl, " MATERIALIZED")
-    parts.append(cvl)
-    return ("WITH " + ",\n       ".join(parts) + ",\n" + rest)
-
-
-@query("q616_matrix_chain", _q616_oracle())
-def q616(spark, sf_dir):
-    """Matrix-chain ordering with the DP checked against the
-    COMPLETE tree enumeration (Godbole 1973; the interval-DP
-    archetype, and the canonical instance of 'the optimizer's
-    join-order problem in miniature').  Six matrices with
-    designed dimensions run two parallel interval recurrences —
-    identical stage text except one GROUP BY: the enumeration
-    table materializes EVERY parenthesization (each length-l
-    interval row set is one join of all shorter left x right
-    trees — no min, so rows multiply combinatorially) while the
-    DP table folds the same join through min.  The enumeration's
-    row counts per interval are exactly the Catalan numbers
-    1,1,2,5,14,42 (catalan_viol == 0 against the literal dim —
-    tying to q606's closed-form machinery), so the top interval
-    provably contains ALL 42 trees, and dp_resid == 0 over every
-    interval says the DP minimum equals the exhaustive minimum
-    everywhere — Bellman optimality verified at every subproblem,
-    not just the root.  The two naive policies are priced from
-    the dims in one aggregation each: left-association pays
-    11186 and right-association 10794 against the true 3390
-    (left_gap/right_gap emitted) — a 3.2x penalty for the
-    'obvious' orders, which is the whole reason query optimizers
-    enumerate.  Scale: intervals are wavefront stages (q606);
-    the enumeration is Catalan-bounded and exists to certify."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q616_documents")
-    base = _q616_base("q616_documents")
-    for tv in ("pd", "en1", "dp1"):
-        _pin_view(spark, f"WITH {base}\nSELECT * FROM {tv}",
-                  f"q616_{tv}")
-    enp, dpp = "q616_en1", "q616_dp1"
-    for l in range(2, 7):
-        _pin_view(spark,
-                  f"SELECT * FROM {enp}\nUNION ALL\n"
-                  + _q616_stage(l, enp, "q616_pd", False),
-                  f"q616_en{l}")
-        _pin_view(spark,
-                  f"SELECT * FROM {dpp}\nUNION ALL\n"
-                  + _q616_stage(l, dpp, "q616_pd", True),
-                  f"q616_dp{l}")
-        enp, dpp = f"q616_en{l}", f"q616_dp{l}"
-    cvl, rest = _q616_final(enp, dpp, "q616_pd",
-                            "q616_documents", "")
-    return spark.sql("WITH " + cvl + ",\n" + rest)
-
-
-# ---------------------------------------------------------------------------
-# q617: Josephus problem — halving rounds vs closed form vs rotation
-
-
-def _q617_base(tbl: str) -> str:
-    pw = ", ".join(f"({b}, {1 << b})" for b in range(9))
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 128 + 1"
-        f" AS BIGINT) AS n FROM {tbl}),\n"
-        f"       pw AS (SELECT CAST(b AS BIGINT) AS b,"
-        f" CAST(p AS BIGINT) AS p\n"
-        f"         FROM (VALUES {pw}) t(b, p)),\n"
-        f"       sv0 AS (SELECT a.n, b.n AS pos\n"
-        f"         FROM nd a JOIN nd b ON b.n <= a.n),\n"
-        f"       fl0 AS (SELECT n, CAST(0 AS BIGINT) AS flag"
-        f" FROM nd)")
-
-
-def _q617_round(sv: str, fl: str) -> tuple:
-    """One halving round: rank survivors per circle, kill by the
-    flag's parity rule, update the flag; 1-person circles
-    frozen."""
-    sv_new = (
-        f"SELECT r.n, r.pos FROM\n"
-        f"  (SELECT a.n, a.pos, CAST(count(*) AS BIGINT)"
-        f" AS rnk\n"
-        f"   FROM {sv} a JOIN {sv} b ON b.n = a.n"
-        f" AND b.pos <= a.pos\n"
-        f"   GROUP BY a.n, a.pos) r\n"
-        f"JOIN (SELECT n, CAST(count(*) AS BIGINT) AS m"
-        f" FROM {sv} GROUP BY n) m ON m.n = r.n\n"
-        f"JOIN {fl} f ON f.n = r.n\n"
-        f"WHERE m.m = 1 OR r.rnk % 2 = 1 - f.flag")
-    fl_new = (
-        f"SELECT f.n,\n"
-        f"  CAST(CASE WHEN m.m > 1 THEN (m.m + f.flag) % 2\n"
-        f"    ELSE f.flag END AS BIGINT) AS flag\n"
-        f"FROM {fl} f JOIN (SELECT n, CAST(count(*) AS BIGINT)"
-        f" AS m\n"
-        f"  FROM {sv} GROUP BY n) m ON m.n = f.n")
-    return sv_new, fl_new
-
-
-def _q617_final(svF: str, pw: str, nd: str, tbl: str, d: str,
-                mat: str) -> str:
-    return (
-        f"hi AS{mat} (SELECT n2.n, max(w.p) AS hp,"
-        f" max(w.b) AS hb\n"
-        f"         FROM {nd} n2 JOIN {pw} w ON w.p <= n2.n\n"
-        f"         GROUP BY n2.n),\n"
-        f"       vf AS{mat} (SELECT s.n, s.pos AS survivor,\n"
-        f"           2*(s.n - h.hp) + 1 AS closed_form,\n"
-        f"           ((s.n*2) % (2*h.hp)) + (s.n {d} h.hp)"
-        f" AS rotated\n"
-        f"         FROM {svF} s JOIN hi h ON h.n = s.n),\n"
-        f"       vv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN survivor <> closed_form\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS closed_viol,\n"
-        f"           CAST(sum(CASE WHEN survivor <> rotated"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS rot_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_circles,\n"
-        f"           CAST(sum(CASE WHEN survivor % 2 = 0 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS even_viol\n"
-        f"         FROM vf),\n"
-        f"       sc AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_left FROM {svF}),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT v.n, v.survivor, v.closed_form, v.rotated,\n"
-        f"       w.closed_viol, w.rot_viol, w.n_circles,\n"
-        f"       w.even_viol, s.n_left, l.n_docs\n"
-        f"FROM vf v CROSS JOIN vv w CROSS JOIN sc s"
-        f" CROSS JOIN ld l")
-
-
-def _q617_oracle(tbl: str = "documents") -> str:
-    parts = [_q617_base(tbl)]
-    sv, fl = "sv0", "fl0"
-    for r in range(1, 8):
-        svq, flq = _q617_round(sv, fl)
-        parts.append(f"sv{r} AS MATERIALIZED ({svq})")
-        parts.append(f"fl{r} AS MATERIALIZED ({flq})")
-        sv, fl = f"sv{r}", f"fl{r}"
-    parts.append(_q617_final(sv, "pw", "nd", tbl, "//",
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q617_josephus", _q617_oracle())
-def q617(spark, sf_dir):
-    """The Josephus problem for k = 2, solved for EVERY circle
-    size 1..128 simultaneously and certified three independent
-    ways (the classical elimination game; Concrete Mathematics
-    §1.3 made its closed form famous — and the k = 2 structure
-    is why power-of-two ring sizes behave specially in every
-    token-ring / leader-election protocol).  The simulation is
-    round-synchronous and RELATIONAL: all 128 circles (sizes
-    from the real doc-id residues, 8256 people total) eliminate
-    in lockstep — per round, rank survivors within each circle
-    by a self-join count, kill by the flag's parity rule (flag
-    tracks whether the sweep ended mid-kill, the one piece of
-    state the halving needs), freeze 1-person circles; seven
-    rounds drain everything (n_left == 128, one survivor per
-    circle).  The result is then checked against two closed
-    forms computed from a power dim: J(n) == 2(n - 2^floor(lg
-    n)) + 1 (closed_viol == 0) and the cyclic-rotation theorem
-    J(n) == rotate-left of n's binary representation
-    (rot_viol == 0, rotation via div/mod on the highest power) —
-    simulation, arithmetic, and bit-structure agreeing on all
-    128 instances; even_viol == 0 rides along (the survivor is
-    always odd — position 2's victimhood propagates).  Scale:
-    each round is one self-join rank + one filter over ALL
-    circles at once — batch simulation of many independent
-    instances in one plan, the Monte-Carlo-farm shape with the
-    randomness removed."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q617_documents")
-    base = _q617_base("q617_documents")
-    for tv in ("nd", "pw", "sv0", "fl0"):
-        _pin_view(spark, f"WITH {base}\nSELECT * FROM {tv}",
-                  f"q617_{tv}", max_rows=9000)
-    sv, fl = "q617_sv0", "q617_fl0"
-    for r in range(1, 8):
-        svq, flq = _q617_round(sv, fl)
-        _pin_view(spark, svq, f"q617_sv{r}", max_rows=9000)
-        _pin_view(spark, flq, f"q617_fl{r}", max_rows=9000)
-        sv, fl = f"q617_sv{r}", f"q617_fl{r}"
-    fin = _q617_final(sv, "q617_pw", "q617_nd",
-                      "q617_documents", "div", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q618: RSA as a permutation of Z_n — verified by total exhaustion
-
-
-_Q618_P, _Q618_Q = 101, 113
-_Q618_N = _Q618_P * _Q618_Q          # 11413
-_Q618_PHI = (_Q618_P - 1) * (_Q618_Q - 1)
-
-
-def _q618_sql(tbl: str, d: str, mat: str) -> str:
-    n, p, q, phi = _Q618_N, _Q618_P, _Q618_Q, _Q618_PHI
-    dg = ", ".join(f"({x})" for x in range(107))
-    parts = [
-        f"dg AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES {dg}) t(x))",
-        f"mu AS{mat} (SELECT a.x*107 + b.x AS m\n"
-        f"         FROM dg a CROSS JOIN dg b\n"
-        f"         WHERE a.x*107 + b.x < {n})",
-        # private exponent by exhaustive inverse of e = 3 mod phi
-        f"dk AS{mat} (SELECT CAST(min(m) AS BIGINT) AS dexp,\n"
-        f"           CAST(count(*) AS BIGINT) AS inv_count\n"
-        f"         FROM mu WHERE (3*m) % {phi} = 1"
-        f" AND m < {phi})",
-        f"qi AS (SELECT CAST(min(m) AS BIGINT) AS qinv\n"
-        f"         FROM mu WHERE ({q}*m) % {p} = 1"
-        f" AND m < {p})",
-        f"en AS{mat} (SELECT m, ((m*m % {n})*m) % {n} AS c"
-        f" FROM mu)",
-        f"pm AS (SELECT CAST(count(DISTINCT c) AS BIGINT)"
-        f" AS n_images FROM en)",
-        f"s0 AS (SELECT e.m, e.c, e.c AS sq,\n"
-        f"           CAST(CASE WHEN (k.dexp {d} 1) % 2 = 1"
-        f" THEN e.c ELSE 1 END AS BIGINT) AS acc\n"
-        f"         FROM en e CROSS JOIN dk k)",
-    ]
-    for k in range(1, 13):
-        parts.append(
-            f"s{k} AS (SELECT s.m, s.c,\n"
-            f"           (s.sq*s.sq) % {n} AS sq,\n"
-            f"           (s.acc * (CASE WHEN (k.dexp {d}"
-            f" {1 << k}) % 2 = 1\n"
-            f"             THEN (s.sq*s.sq) % {n} ELSE 1 END))"
-            f" % {n} AS acc\n"
-            f"         FROM s{k - 1} s CROSS JOIN dk k)")
-    parts.append(
-        f"rt AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN acc <> m THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS roundtrip_viol,\n"
-        f"           CAST(sum(CASE WHEN m % {p} = 0 OR"
-        f" m % {q} = 0\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_noncoprime,\n"
-        f"           CAST(sum(CASE WHEN (m % {p} = 0 OR"
-        f" m % {q} = 0)\n"
-        f"             AND acc <> m THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS nc_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_msgs"
-        f" FROM s12)")
-    # corpus traffic decrypted via CRT, cross-checked three ways
-    parts.append(
-        f"tx AS{mat} (SELECT doc_id,\n"
-        f"           CAST((n_chars*37 + doc_id) % {n} AS BIGINT)"
-        f" AS m\n"
-        f"         FROM {tbl})")
-    parts.append(
-        f"tc AS{mat} (SELECT t.doc_id, t.m, e.c, s.acc"
-        f" AS direct\n"
-        f"         FROM tx t JOIN en e ON e.m = t.m\n"
-        f"         JOIN s12 s ON s.m = t.m)")
-    parts.append(
-        f"c0 AS (SELECT t.doc_id, t.m, t.c, t.direct,\n"
-        f"           t.c % {p} AS sp, t.c % {q} AS sq2,\n"
-        f"           CAST(CASE WHEN ((k.dexp % {p - 1}) {d} 1)"
-        f" % 2 = 1\n"
-        f"             THEN t.c % {p} ELSE 1 END AS BIGINT)"
-        f" AS ap,\n"
-        f"           CAST(CASE WHEN ((k.dexp % {q - 1}) {d} 1)"
-        f" % 2 = 1\n"
-        f"             THEN t.c % {q} ELSE 1 END AS BIGINT)"
-        f" AS aq\n"
-        f"         FROM tc t CROSS JOIN dk k)")
-    for k in range(1, 7):
-        parts.append(
-            f"c{k} AS (SELECT c.doc_id, c.m, c.c, c.direct,\n"
-            f"           (c.sp*c.sp) % {p} AS sp,\n"
-            f"           (c.sq2*c.sq2) % {q} AS sq2,\n"
-            f"           (c.ap * (CASE WHEN ((k.dexp % {p - 1})"
-            f" {d} {1 << k}) % 2 = 1\n"
-            f"             THEN (c.sp*c.sp) % {p} ELSE 1 END))"
-            f" % {p} AS ap,\n"
-            f"           (c.aq * (CASE WHEN ((k.dexp % {q - 1})"
-            f" {d} {1 << k}) % 2 = 1\n"
-            f"             THEN (c.sq2*c.sq2) % {q} ELSE 1 END))"
-            f" % {q} AS aq\n"
-            f"         FROM c{k - 1} c CROSS JOIN dk k)")
-    parts.append(
-        f"crt AS{mat} (SELECT c.doc_id, c.m, c.c, c.direct,\n"
-        f"           c.aq + {q}*((((c.ap - c.aq) % {p} + {p})"
-        f" % {p} * i.qinv) % {p}) AS m_crt\n"
-        f"         FROM c6 c CROSS JOIN qi i)")
-    parts.append(
-        f"cv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN m_crt <> m THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS crt_viol,\n"
-        f"           CAST(sum(CASE WHEN m_crt <> direct THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS crt_direct_viol,"
-        f"\n"
-        f"           CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM crt)")
-    fin = (
-        f"SELECT c.doc_id, c.m, c.c, c.direct, c.m_crt,\n"
-        f"       k.dexp, k.inv_count, i.qinv, p.n_images,\n"
-        f"       r.roundtrip_viol, r.n_noncoprime, r.nc_viol,\n"
-        f"       r.n_msgs, v.crt_viol, v.crt_direct_viol,"
-        f" v.n_docs\n"
-        f"FROM crt c CROSS JOIN dk k CROSS JOIN qi i\n"
-        f"CROSS JOIN pm p CROSS JOIN rt r CROSS JOIN cv v\n"
-        f"WHERE c.doc_id < 16")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q618_rsa_permutation",
-       "WITH " + _q618_sql("documents", "//", " MATERIALIZED"))
-def q618(spark, sf_dir):
-    """Textbook RSA with its correctness theorem verified by
-    TOTAL exhaustion over the message space (Rivest-Shamir-
-    Adleman 1977; n = 101 x 113, e = 3).  Everything derives
-    in-plan: the private exponent is found by exhaustive
-    inversion of e mod phi over the full residue universe
-    (inv_count == 1 — uniqueness of the inverse, observed), and
-    q^-1 mod p for CRT the same way.  Every one of the 11413
-    messages encrypts (one cube-mod expression) and decrypts
-    (13 square-and-multiply stages reading bits of the COMPUTED
-    d via div/mod): n_images == 11413 proves encryption is a
-    PERMUTATION of Z_n, and roundtrip_viol == 0 proves m^(ed)
-    == m for every single message — including the 213 messages
-    NOT coprime to n (nc_viol == 0), the class the naive
-    Euler-theorem proof misses and squarefree-n saves, here a
-    measured fact rather than a footnote.  Real corpus traffic
-    then decrypts a second way: the CRT path (exponents d mod
-    p-1 and d mod q-1, two 7-stage chains in the small fields,
-    Garner recombination through the computed q^-1) agrees with
-    both the direct decryption and the original message
-    (crt_viol == crt_direct_viol == 0) — the 4x-speedup
-    optimization every RSA implementation uses, cross-checked
-    against the slow path on every document.  Scale: the
-    exhaustion is a generated dim; per-row work is pure modular
-    column arithmetic — exactly how a key-scan over billions of
-    records would run."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q618_documents")
-    return spark.sql(
-        "WITH " + _q618_sql("q618_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q619: Batcher odd-even merge sort network — 0-1 principle live
-
-
-_Q619_COMPS = [(0, 1), (2, 3), (0, 2), (1, 3), (1, 2), (4, 5),
-               (6, 7), (4, 6), (5, 7), (5, 6), (0, 4), (2, 6),
-               (2, 4), (1, 5), (3, 7), (3, 5), (1, 2), (3, 4),
-               (5, 6)]
-
-
-def _q619_sql(tbl: str, d: str, mat: str) -> str:
-    cols8 = ", ".join(f"b{i}.x AS x{i}" for i in range(8))
-    joins8 = " CROSS JOIN ".join(f"bd b{i}" for i in range(8))
-    vid = " + ".join(f"b{i}.x*{1 << i}" for i in range(8))
-    piv = ",\n           ".join(
-        f"CAST(max(CASE WHEN doc_id % 8 = {i} THEN n_chars END)"
-        f" AS BIGINT) AS x{i}" for i in range(8))
-    parts = [
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        f"bv AS{mat} (SELECT CAST(0 AS BIGINT) AS pop,"
-        f" {vid} AS vid, {cols8}\n"
-        f"         FROM {joins8})",
-        f"cg AS{mat} (SELECT CAST(1 AS BIGINT) AS pop,\n"
-        f"           doc_id {d} 8 AS vid,\n"
-        f"           {piv}\n"
-        f"         FROM {tbl} GROUP BY doc_id {d} 8\n"
-        f"         HAVING count(*) = 8)",
-        "v0 AS (SELECT * FROM bv UNION ALL SELECT * FROM cg)",
-    ]
-    prev = "v0"
-    for s, (a, b) in enumerate(_Q619_COMPS, 1):
-        cols = []
-        for i in range(8):
-            if i == a:
-                cols.append(f"least(x{a}, x{b}) AS x{i}")
-            elif i == b:
-                cols.append(f"greatest(x{a}, x{b}) AS x{i}")
-            else:
-                cols.append(f"x{i}")
-        parts.append(f"v{s} AS (SELECT pop, vid, "
-                     + ", ".join(cols) + f" FROM {prev})")
-        prev = f"v{s}"
-    unsorted = " + ".join(
-        f"(CASE WHEN x{i} > x{i + 1} THEN 1 ELSE 0 END)"
-        for i in range(7))
-    s_in = " + ".join(f"a.x{i}" for i in range(8))
-    s_out = " + ".join(f"z.x{i}" for i in range(8))
-    q_in = " + ".join(f"a.x{i}*a.x{i}" for i in range(8))
-    q_out = " + ".join(f"z.x{i}*z.x{i}" for i in range(8))
-    parts.append(
-        f"srt AS{mat} (SELECT pop, vid, {unsorted} AS nviol,\n"
-        f"           x0, x1, x2, x3, x4, x5, x6, x7\n"
-        f"         FROM {prev})")
-    parts.append(
-        f"agg AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN pop = 0 THEN nviol"
-        f" ELSE 0 END) AS BIGINT) AS binary_viol,\n"
-        f"           CAST(sum(CASE WHEN pop = 1 THEN nviol"
-        f" ELSE 0 END) AS BIGINT) AS corpus_viol,\n"
-        f"           CAST(sum(CASE WHEN pop = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_binary,\n"
-        f"           CAST(sum(CASE WHEN pop = 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_groups\n"
-        f"         FROM srt)")
-    parts.append(
-        f"thr AS (SELECT CAST(count(DISTINCT x0*1 + x1*2 +"
-        f" x2*4 + x3*8\n"
-        f"           + x4*16 + x5*32 + x6*64 + x7*128)"
-        f" AS BIGINT) AS n_thresholds\n"
-        f"         FROM srt WHERE pop = 0)")
-    parts.append(
-        f"prm AS (SELECT CAST(sum(CASE WHEN ({s_in}) <>"
-        f" ({s_out})\n"
-        f"           OR ({q_in}) <> ({q_out}) THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS perm_viol\n"
-        f"         FROM v0 a JOIN srt z\n"
-        f"           ON z.pop = a.pop AND z.vid = a.vid)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT s.pop, s.vid, s.x0, s.x1, s.x2, s.x3, s.x4,\n"
-        f"       s.x5, s.x6, s.x7,\n"
-        f"       a.binary_viol, a.corpus_viol, a.n_binary,\n"
-        f"       a.n_groups, t.n_thresholds, p.perm_viol,\n"
-        f"       CAST({len(_Q619_COMPS)} AS BIGINT)"
-        f" AS n_comparators, l.n_docs\n"
-        f"FROM srt s CROSS JOIN agg a CROSS JOIN thr t\n"
-        f"CROSS JOIN prm p CROSS JOIN ld l\n"
-        f"WHERE s.pop = 1 AND s.vid < 8")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q619_sorting_network",
-       "WITH " + _q619_sql("documents", "//", " MATERIALIZED"))
-def q619(spark, sf_dir):
-    """Batcher's odd-even merge sorting network with the 0-1
-    principle exercised as a computation (Batcher 1968; Knuth
-    TAOCP 5.3.4 — the data-oblivious sort that underlies every
-    GPU bitonic kernel and secure-computation sort, where the
-    comparison SEQUENCE cannot depend on the data).  The 19
-    comparators for n = 8 run as 19 chained projections — each
-    one a least/greatest pair on two of eight columns, the same
-    wire diagram for every row — over TWO populations at once:
-    all 256 binary vectors (8-way parity cross join) and the
-    real corpus packed 8 documents per row.  binary_viol == 0
-    over the complete binary universe is the 0-1 principle's
-    hypothesis verified by exhaustion; corpus_viol == 0 over
-    every group of real n_chars values is the principle's
-    CONCLUSION holding on arbitrary integers — hypothesis and
-    conclusion both measured in one plan.  n_thresholds == 9
-    confirms the sorted binary outputs collapse to exactly the
-    nine threshold vectors 0^k 1^(8-k) (what 'sorted 0-1
-    vector' means, counted), and perm_viol == 0 checks the
-    network only PERMUTES (sum and sum-of-squares preserved per
-    row between input and output — a comparator can swap,
-    never rewrite).  Scale: a sorting network is the
-    shuffle-free sort — 19 fixed vectorized column ops with no
-    data-dependent branching, the same plan for 256 rows or a
-    trillion; that obliviousness is the entire point."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q619_documents")
-    return spark.sql(
-        "WITH " + _q619_sql("q619_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q620: LP fundamental theorem — vertex exhaustion + strong duality
-
-
-_Q620_CONS = [(1, 2, 14), (3, -1, 5), (-1, 1, 2), (-1, 0, 0),
-              (0, -1, 0)]
-_Q620_OBJ = (3, 5)
-
-
-def _q620_sql(tbl: str, d: str, mat: str) -> str:
-    cv = ", ".join(f"({k}, {a}, {b}, {c})"
-                   for k, (a, b, c) in enumerate(_Q620_CONS))
-    ox, oy = _Q620_OBJ
-    return (
-        f"cs AS (SELECT CAST(k AS BIGINT) AS k, CAST(a AS"
-        f" BIGINT) AS a,\n"
-        f"           CAST(b AS BIGINT) AS b, CAST(c AS BIGINT)"
-        f" AS c\n"
-        f"         FROM (VALUES {cv}) t(k, a, b, c)),\n"
-        # all basis pairs -> candidate vertices, exact rationals
-        # with the denominator canonicalized positive
-        f"       vt AS{mat} (SELECT i.k AS ki, j.k AS kj,\n"
-        f"           CASE WHEN i.a*j.b - j.a*i.b > 0 THEN\n"
-        f"             i.c*j.b - j.c*i.b ELSE -(i.c*j.b -"
-        f" j.c*i.b) END AS xn,\n"
-        f"           CASE WHEN i.a*j.b - j.a*i.b > 0 THEN\n"
-        f"             i.a*j.c - j.a*i.c ELSE -(i.a*j.c -"
-        f" j.a*i.c) END AS yn,\n"
-        f"           abs(i.a*j.b - j.a*i.b) AS dn\n"
-        f"         FROM cs i JOIN cs j ON j.k > i.k\n"
-        f"         WHERE i.a*j.b - j.a*i.b <> 0),\n"
-        f"       fe AS{mat} (SELECT v.ki, v.kj, v.xn, v.yn,"
-        f" v.dn,\n"
-        f"           {ox}*v.xn + {oy}*v.yn AS zn,\n"
-        f"           CAST(sum(CASE WHEN w.a*v.xn + w.b*v.yn >\n"
-        f"             w.c*v.dn THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_viol\n"
-        f"         FROM vt v CROSS JOIN cs w\n"
-        f"         GROUP BY v.ki, v.kj, v.xn, v.yn, v.dn),\n"
-        # the optimum: the feasible vertex no feasible vertex beats
-        f"       opt AS{mat} (SELECT v.* FROM fe v\n"
-        f"         WHERE v.n_viol = 0 AND NOT EXISTS (\n"
-        f"           SELECT 1 FROM fe w WHERE w.n_viol = 0\n"
-        f"             AND w.zn*v.dn > v.zn*w.dn)),\n"
-        f"       nop AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_opt FROM opt),\n"
-        f"       mrg AS (SELECT CAST(min(o.zn*w.dn - w.zn*o.dn)\n"
-        f"           AS BIGINT) AS min_margin\n"
-        f"         FROM opt o JOIN fe w ON w.n_viol = 0\n"
-        f"           AND w.zn*o.dn < o.zn*w.dn),\n"
-        # dual from the optimal basis by Cramer (shared den)
-        f"       du AS{mat} (SELECT o.ki, o.kj, o.zn, o.dn,\n"
-        f"           CASE WHEN i.a*j.b - j.a*i.b > 0 THEN\n"
-        f"             {ox}*j.b - {oy}*j.a ELSE -({ox}*j.b -"
-        f" {oy}*j.a) END AS yin,\n"
-        f"           CASE WHEN i.a*j.b - j.a*i.b > 0 THEN\n"
-        f"             i.a*{oy} - i.b*{ox} ELSE -(i.a*{oy} -"
-        f" i.b*{ox}) END AS yjn,\n"
-        f"           i.a AS ia, i.b AS ib, i.c AS ic,\n"
-        f"           j.a AS ja, j.b AS jb, j.c AS jc\n"
-        f"         FROM opt o JOIN cs i ON i.k = o.ki\n"
-        f"         JOIN cs j ON j.k = o.kj),\n"
-        f"       dcrt AS (SELECT\n"
-        f"           CAST(CASE WHEN yin < 0 OR yjn < 0 THEN 1"
-        f" ELSE 0 END AS BIGINT) AS dual_neg_viol,\n"
-        f"           CAST(CASE WHEN ia*yin + ja*yjn <> {ox}*dn"
-        f" OR\n"
-        f"             ib*yin + jb*yjn <> {oy}*dn THEN 1 ELSE 0"
-        f" END AS BIGINT) AS dual_eq_viol,\n"
-        f"           CAST(ic*yin + jc*yjn - zn AS BIGINT)"
-        f" AS strong_resid\n"
-        f"         FROM du),\n"
-        # complementary slackness: nonbasic constraints have
-        # strictly positive slack at the optimum (their dual is 0)
-        f"       cmp AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           w.a*o.xn + w.b*o.yn >= w.c*o.dn THEN 1"
-        f" ELSE 0 END)\n"
-        f"           AS BIGINT) AS slack_zero_nonbasic\n"
-        f"         FROM opt o JOIN cs w\n"
-        f"           ON w.k <> o.ki AND w.k <> o.kj),\n"
-        f"       nfs AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN n_viol = 0 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS n_feasible,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_vertices"
-        f" FROM fe),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT f.ki, f.kj, f.xn, f.yn, f.dn, f.zn, f.n_viol,\n"
-        f"       o.zn AS opt_zn, o.dn AS opt_dn,\n"
-        f"       u.yin, u.yjn, n.n_opt, m.min_margin,\n"
-        f"       c2.dual_neg_viol, c2.dual_eq_viol,"
-        f" c2.strong_resid,\n"
-        f"       p.slack_zero_nonbasic, s.n_feasible,"
-        f" s.n_vertices,\n"
-        f"       l.n_docs\n"
-        f"FROM fe f CROSS JOIN opt o CROSS JOIN du u\n"
-        f"CROSS JOIN nop n CROSS JOIN mrg m CROSS JOIN dcrt c2\n"
-        f"CROSS JOIN cmp p CROSS JOIN nfs s CROSS JOIN ld l")
-
-
-@query("q620_lp_duality",
-       "WITH " + _q620_sql("documents", "//", " MATERIALIZED"))
-def q620(spark, sf_dir):
-    """Linear programming's fundamental theorem and strong
-    duality, in exact rational arithmetic (Dantzig 1947, von
-    Neumann's duality — the optimization core under every
-    resource allocator, solved here the way a proof assistant
-    would).  The 2-variable LP max 3x + 5y under five halfplanes
-    enumerates ALL C(5,2) basis pairs into candidate vertices as
-    (numerator, numerator, denominator) triples via Cramer's
-    rule — the denominator canonicalized positive so every
-    subsequent inequality is a pure integer cross-multiplication,
-    no division ever happens.  Feasibility screens each vertex
-    against every constraint (n_feasible == 5 of 10), and the
-    optimum is the feasible vertex no feasible vertex beats —
-    which lands on the FRACTIONAL point (24/7, 37/7) with value
-    257/7, beating the runner-up 110/3 by min_margin == 1: the
-    cross-multiplied comparison 771 vs 770 is decided by a
-    single integer unit, exactly the race float tolerance makes
-    queasy and exact rationals make trivial.  Optimality is then
-    PROVED, not just exhausted: the dual solution solves the
-    optimal basis's transposed system by the same Cramer
-    machinery (y = (18/7, 1/7)), and dual_neg_viol == 0,
-    dual_eq_viol == 0 (A_B^T y == c exactly), strong_resid == 0
-    (dual objective == primal — the certificate that bounds the
-    WHOLE polytope, where vertex exhaustion alone only bounds
-    the vertices), and slack_zero_nonbasic == 0 (complementary
-    slackness: every nonbasic constraint is strictly slack).
-    Scale: constraint dims are broadcast-size; the pattern —
-    exact rational pivots with cross-multiplied comparisons —
-    is how an optimizer's cost model avoids float cliffs."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q620_documents")
-    return spark.sql(
-        "WITH " + _q620_sql("q620_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q621: Bell & Stirling numbers — RGS exhaustion vs two recurrences
-
-
-_Q621_PASCAL = ", ".join(
-    f"({n}, {k}, {__import__('math').comb(n, k)})"
-    for n in range(9) for k in range(n + 1))
-
-
-def _q621_sql(tbl: str, d: str, mat: str) -> str:
-    parts = [
-        f"dg AS (SELECT DISTINCT CAST(doc_id % 9 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        f"pa AS (SELECT CAST(n AS BIGINT) AS n, CAST(k AS"
-        f" BIGINT) AS k,\n"
-        f"           CAST(c AS BIGINT) AS c\n"
-        f"         FROM (VALUES {_Q621_PASCAL}) t(n, k, c))",
-        # restricted growth strings: a_0 = 0, a_i <= max + 1
-        f"r1 AS (SELECT CAST(0 AS BIGINT) AS mx,"
-        f" CAST(0 AS BIGINT) AS rgs\n"
-        f"         FROM dg WHERE x = 0)",
-    ]
-    for i in range(2, 10):
-        parts.append(
-            f"r{i} AS (SELECT CASE WHEN d2.x > r.mx THEN d2.x"
-            f" ELSE r.mx END AS mx,\n"
-            f"           r.rgs*9 + d2.x AS rgs\n"
-            f"         FROM r{i - 1} r JOIN dg d2"
-            f" ON d2.x <= r.mx + 1)")
-    parts.append(
-        f"rg AS{mat} (SELECT mx + 1 AS nblocks,"
-        f" CAST(count(*) AS BIGINT) AS cnt,\n"
-        f"           CAST(count(DISTINCT rgs) AS BIGINT)"
-        f" AS cnt_distinct\n"
-        f"         FROM r9 GROUP BY mx + 1)")
-    parts.append(
-        "bl AS (SELECT CAST(sum(cnt) AS BIGINT) AS bell_rgs,\n"
-        "           CAST(sum(cnt_distinct) AS BIGINT)"
-        " AS bell_distinct FROM rg)")
-    # Stirling second-kind DP (engine pins these; oracle CTEs)
-    sdp = ["t1 AS (SELECT CAST(1 AS BIGINT) AS k,"
-           " CAST(1 AS BIGINT) AS v FROM dg WHERE x = 0)"]
-    for n in range(2, 10):
-        sdp.append(
-            f"t{n} AS (SELECT k, CAST(sum(v) AS BIGINT) AS v"
-            f" FROM (\n"
-            f"         SELECT k, k*v AS v FROM t{n - 1}\n"
-            f"         UNION ALL SELECT k + 1, v FROM t{n - 1})"
-            f" u GROUP BY k)")
-    parts.extend(sdp)
-    parts.append(
-        f"sv AS (SELECT CAST(sum(CASE WHEN t.v <> g.cnt THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS stirling_viol,\n"
-        f"           CAST(sum(t.v) AS BIGINT) AS stirling_sum\n"
-        f"         FROM t9 t JOIN rg g ON g.nblocks = t.k)")
-    # Bell by the binomial recurrence B(n+1) = sum C(n,k) B(k)
-    bb = ["b0 AS (SELECT CAST(0 AS BIGINT) AS n,"
-          " CAST(1 AS BIGINT) AS v FROM dg WHERE x = 0)"]
-    for n in range(1, 10):
-        bb.append(
-            f"b{n} AS (SELECT n, v FROM b{n - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT CAST({n} AS BIGINT),"
-            f" CAST(sum(p.c*b.v) AS BIGINT)\n"
-            f"         FROM b{n - 1} b JOIN pa p\n"
-            f"           ON p.n = {n - 1} AND p.k = b.n)")
-    parts.extend(bb)
-    parts.append(
-        "bv AS (SELECT CAST(max(CASE WHEN n = 9 THEN v END)"
-        " AS BIGINT) AS bell_binom FROM b9)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT g.nblocks, g.cnt, t.v AS stirling_dp,\n"
-        f"       l.bell_rgs, l.bell_distinct,\n"
-        f"       l.bell_rgs - l.bell_distinct AS dup_resid,\n"
-        f"       s.stirling_viol, s.stirling_sum,\n"
-        f"       s.stirling_sum - l.bell_rgs AS sum_resid,\n"
-        f"       b.bell_binom, b.bell_binom - l.bell_rgs"
-        f" AS binom_resid,\n"
-        f"       d2.n_docs\n"
-        f"FROM rg g JOIN t9 t ON t.k = g.nblocks\n"
-        f"CROSS JOIN bl l CROSS JOIN sv s CROSS JOIN bv b\n"
-        f"CROSS JOIN ld d2")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-def _q621_oracle(tbl: str = "documents") -> str:
-    sql = _q621_sql(tbl, "//", " MATERIALIZED")
-    # materialize the double-referenced DP stages
-    for n in range(2, 10):
-        sql = sql.replace(f"t{n} AS (SELECT",
-                          f"t{n} AS MATERIALIZED (SELECT")
-        sql = sql.replace(f"b{n} AS (SELECT",
-                          f"b{n} AS MATERIALIZED (SELECT")
-    sql = sql.replace("b1 AS (SELECT", "b1 AS MATERIALIZED"
-                      " (SELECT")
-    return "WITH " + sql
-
-
-@query("q621_bell_stirling", _q621_oracle())
-def q621(spark, sf_dir):
-    """Bell and Stirling numbers with the partition lattice
-    enumerated in full and three independent computations forced
-    to agree (Bell 1934, Stirling 1730, Rota 1964 — the
-    combinatorics of 'how many ways to group': clustering
-    configuration counts, partition-aware shuffles).  All 21147
-    set partitions of 9 elements materialize as RESTRICTED
-    GROWTH STRINGS — nine chained joins where each digit may
-    exceed the running max by at most one, the classic bijection
-    between partitions and canonical labelings — with each
-    partition packed base-9 into one BIGINT; cnt_distinct ==
-    cnt certifies the enumeration never duplicates
-    (dup_resid == 0), so the chain generates each partition
-    EXACTLY once.  Grouping by number of blocks yields the
-    Stirling row S(9,k) = 1, 255, 3025, 7770, 6951, 2646, 462,
-    36, 1 — and stirling_viol == 0 checks every entry against
-    the triangle recurrence S(n,k) = k S(n-1,k) + S(n-1,k-1)
-    built by nine independent DP stages; the row sums to
-    bell_rgs == 21147 (sum_resid == 0), which the THIRD
-    machine — Bell's binomial recurrence B(n+1) = sum C(n,k)B(k)
-    over a Pascal dim — reproduces exactly (binom_resid == 0).
-    Enumeration, triangle recurrence, and binomial recurrence
-    share no intermediate results; their three-way agreement on
-    every row is the certificate.  Scale: the RGS chain is the
-    q600 prefix-extension shape with a data-dependent branching
-    factor — rows grow as Bell numbers, each stage one broadcast
-    join, and the same plan enumerates partitions of any ground
-    set a shuffle can hold."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q621_documents")
-    base_sql = _q621_sql("q621_documents", "div", "")
-    # pin the double-referenced DP stages; RGS chain is linear
-    head, tail = base_sql.split("t1 AS (SELECT", 1)
-    # build pinned Stirling + Bell tables
-    _pin_view(spark,
-              "SELECT CAST(1 AS BIGINT) AS k, CAST(1 AS BIGINT)"
-              " AS v", "q621_t1")
-    prev = "q621_t1"
-    for n in range(2, 10):
-        _pin_view(spark,
-                  f"SELECT k, CAST(sum(v) AS BIGINT) AS v"
-                  f" FROM (\n"
-                  f"  SELECT k, k*v AS v FROM {prev}\n"
-                  f"  UNION ALL SELECT k + 1, v FROM {prev}) u\n"
-                  f"GROUP BY k", f"q621_t{n}")
-        prev = f"q621_t{n}"
-    _pin_view(spark,
-              "SELECT CAST(0 AS BIGINT) AS n, CAST(1 AS BIGINT)"
-              " AS v", "q621_b0")
-    pasc = (f"SELECT CAST(n AS BIGINT) AS n, CAST(k AS BIGINT)"
-            f" AS k, CAST(c AS BIGINT) AS c FROM"
-            f" (VALUES {_Q621_PASCAL}) t(n, k, c)")
-    _pin_view(spark, pasc, "q621_pa")
-    prev = "q621_b0"
-    for n in range(1, 10):
-        _pin_view(spark,
-                  f"SELECT n, v FROM {prev}\n"
-                  f"UNION ALL\n"
-                  f"SELECT CAST({n} AS BIGINT),"
-                  f" CAST(sum(p.c*b.v) AS BIGINT)\n"
-                  f"FROM {prev} b JOIN q621_pa p"
-                  f" ON p.n = {n - 1} AND p.k = b.n",
-                  f"q621_b{n}")
-        prev = f"q621_b{n}"
-    # final SQL: RGS chain inline (linear), DP tables pinned
-    sql = _q621_sql("q621_documents", "div", "")
-    # drop the inline DP stage CTEs, rewire to the pinned views
-    for n in range(1, 10):
-        sql = re.sub(
-            rf"t{n} AS \(SELECT.*?GROUP BY k\),\n       "
-            if n > 1 else
-            r"t1 AS \(SELECT CAST\(1 AS BIGINT\) AS k,"
-            r" CAST\(1 AS BIGINT\) AS v FROM dg WHERE x = 0\),"
-            r"\n       ",
-            "", sql, flags=re.DOTALL)
-    sql = re.sub(r"b0 AS \(SELECT.*?WHERE x = 0\),\n       ",
-                 "", sql, flags=re.DOTALL)
-    for n in range(1, 10):
-        sql = re.sub(
-            rf"b{n} AS \(SELECT n, v FROM b{n - 1}.*?"
-            rf"AND p\.k = b\.n\),\n       ",
-            "", sql, flags=re.DOTALL)
-    sql = sql.replace("FROM t9 t", "FROM q621_t9 t") \
-             .replace("JOIN t9 t", "JOIN q621_t9 t") \
-             .replace("FROM b9", "FROM q621_b9")
-    return spark.sql("WITH " + sql)
-
-
-# ---------------------------------------------------------------------------
-# q622: interval scheduling — greedy exchange argument by exhaustion
-
-
-_Q622_IV = [(15, 21, 2), (25, 34, 3), (5, 8, 1), (25, 35, 5),
-            (3, 8, 9), (34, 41, 5), (11, 14, 5), (13, 15, 5),
-            (17, 22, 3), (19, 25, 6), (5, 16, 6), (24, 34, 4),
-            (11, 16, 8), (17, 20, 9), (19, 21, 5), (36, 42, 9)]
-
-
-def _q622_sql(tbl: str, d: str, mat: str) -> str:
-    ivv = ", ".join(f"({i}, {s}, {e}, {w})"
-                    for i, (s, e, w) in enumerate(_Q622_IV))
-    cols = " CROSS JOIN ".join(f"bd b{i}" for i in range(16))
-    bits = ", ".join(f"b{i}.x AS g{i}" for i in range(16))
-    card = " + ".join(f"g{i}" for i in range(16))
-    wsum = " + ".join(f"g{i}*{w}" for i, (s, e, w)
-                      in enumerate(_Q622_IV))
-    parts = [
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        f"iv AS (SELECT CAST(i AS BIGINT) AS i, CAST(s AS"
-        f" BIGINT) AS s,\n"
-        f"           CAST(e AS BIGINT) AS e, CAST(w AS BIGINT)"
-        f" AS w\n"
-        f"         FROM (VALUES {ivv}) t(i, s, e, w))",
-        f"cf AS{mat} (SELECT a.i AS i1, b.i AS i2 FROM iv a\n"
-        f"         JOIN iv b ON a.i < b.i AND a.s < b.e"
-        f" AND b.s < a.e)",
-        f"sx AS{mat} (SELECT {bits}, {card} AS card,"
-        f" {wsum} AS wsum\n"
-        f"         FROM {cols})",
-        # feasible = no conflicting pair both present; the
-        # bit test is positional (g columns), no div/mod needed
-        f"fz AS{mat} (SELECT x.card, x.wsum,\n"
-        f"           CAST(sum((" + " + ".join(
-            f"CASE WHEN c.i1 = {i} THEN x.g{i} ELSE 0 END"
-            for i in range(16)) + ") * (" + " + ".join(
-            f"CASE WHEN c.i2 = {i} THEN x.g{i} ELSE 0 END"
-            for i in range(16)) + ")) AS BIGINT) AS n_bad\n"
-        f"         FROM sx x CROSS JOIN cf c\n"
-        f"         GROUP BY x.card, x.wsum, " + ", ".join(
-            f"x.g{i}" for i in range(16)) + ")",
-        f"ex AS (SELECT CAST(max(CASE WHEN n_bad = 0 THEN card"
-        f" END) AS BIGINT) AS exh_card,\n"
-        f"           CAST(max(CASE WHEN n_bad = 0 THEN wsum"
-        f" END) AS BIGINT) AS exh_w,\n"
-        f"           CAST(sum(CASE WHEN n_bad = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_feasible\n"
-        f"         FROM fz)",
-        # greedy earliest-finish, tie packed (e*16 + i)
-        "g0 AS (SELECT CAST(-1 AS BIGINT) AS t, CAST(0 AS"
-        " BIGINT) AS cnt,\n"
-        "           CAST(0 AS BIGINT) AS ws FROM iv WHERE i = 0)",
-    ]
-    for s in range(1, 9):
-        parts.append(
-            f"gp{s} AS (SELECT max(g.t) AS t, max(g.cnt)"
-            f" AS cnt,\n"
-            f"           max(g.ws) AS ws, min(v.e*16 + v.i)"
-            f" AS pick\n"
-            f"         FROM g{s - 1} g LEFT JOIN iv v"
-            f" ON v.s >= g.t)")
-        parts.append(
-            f"g{s} AS (SELECT CASE WHEN p.pick IS NULL THEN p.t\n"
-            f"             ELSE p.pick {d} 16 END AS t,\n"
-            f"           p.cnt + CASE WHEN p.pick IS NULL THEN 0"
-            f" ELSE 1 END AS cnt,\n"
-            f"           p.ws + coalesce(v.w, 0) AS ws\n"
-            f"         FROM gp{s} p LEFT JOIN iv v"
-            f" ON v.i = p.pick % 16)")
-    parts.append(
-        "grd AS (SELECT CAST(cnt AS BIGINT) AS greedy_card,\n"
-        "           CAST(ws AS BIGINT) AS greedy_w FROM g8)")
-    # weighted DP as a max-plus closure over the successor DAG
-    parts.append(
-        f"dg AS{mat} (SELECT a.i AS x, b.i AS y, b.w FROM iv a\n"
-        f"         JOIN iv b ON a.e <= b.s\n"
-        f"         UNION ALL SELECT i, i, CAST(0 AS BIGINT)"
-        f" FROM iv)")
-    prev = "dg"
-    for k in range(1, 5):
-        parts.append(
-            f"dw{k} AS{mat} (SELECT x, y, max(w) AS w FROM (\n"
-            f"         SELECT x, y, w FROM {prev}\n"
-            f"         UNION ALL SELECT a.x, b.y, a.w + b.w\n"
-            f"         FROM {prev} a JOIN {prev} b"
-            f" ON b.x = a.y) t\n"
-            f"         GROUP BY x, y)")
-        prev = f"dw{k}"
-    parts.append(
-        f"wdp AS (SELECT CAST(max(v.w + c.w) AS BIGINT)"
-        f" AS dp_w\n"
-        f"         FROM iv v JOIN {prev} c ON c.x = v.i)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT v.i, v.s, v.e, v.w,\n"
-        f"       x.exh_card, x.exh_w, x.n_feasible,\n"
-        f"       g.greedy_card, g.greedy_w,\n"
-        f"       g.greedy_card - x.exh_card AS card_resid,\n"
-        f"       x.exh_w - g.greedy_w AS greedy_w_gap,\n"
-        f"       p.dp_w, p.dp_w - x.exh_w AS dp_resid,\n"
-        f"       (SELECT CAST(count(*) AS BIGINT) FROM cf)"
-        f" AS n_conflicts,\n"
-        f"       l.n_docs\n"
-        f"FROM iv v CROSS JOIN ex x CROSS JOIN grd g\n"
-        f"CROSS JOIN wdp p CROSS JOIN ld l")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q622_interval_scheduling",
-       "WITH " + _q622_sql("documents", "//", " MATERIALIZED"))
-def q622(spark, sf_dir):
-    """Interval scheduling: where greedy is provably optimal and
-    where it provably is not, both by exhaustion (Kleinberg-
-    Tardos ch. 4's opening pair — the scheduling shape of every
-    slot allocator).  Sixteen intervals; the ENTIRE subset
-    lattice (2^16 via a 16-way parity cross join, bits as
-    positional columns) is screened for feasibility against the
-    precomputed conflict-pair dim — n_bad counts conflicting
-    pairs actually present, a pure sum-product per subset.  The
-    exhaustive maxima then judge two algorithms: earliest-
-    finish-first greedy (8 unrolled rounds, tie packed e*16+i)
-    achieves card_resid == 0 — the exchange argument's
-    conclusion confirmed over all 65536 subsets, greedy IS
-    optimal for cardinality — while the SAME greedy schedule
-    leaves greedy_w_gap == 17 weight on the table (23 vs 40):
-    one fixture, one algorithm, optimal under one objective and
-    17/40ths wrong under another, both facts measured.  Weighted
-    interval scheduling is then solved properly — max-weight
-    chain via 4 max-plus doubling stages over the
-    ends-before-starts DAG, no sequential DP pass — and
-    dp_resid == 0 certifies it against the same exhaustion.
-    Scale: the subset sweep is fixture-bounded certification;
-    the DP closure and the greedy chain are the shapes that
-    run at fleet size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q622_documents")
-    return spark.sql(
-        "WITH " + _q622_sql("q622_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q623: shortest addition chains — power ladders by exhaustive BFS
-
-
-def _q623_base(tbl: str) -> str:
-    ps = ", ".join(f"({p}, {32 ** p})" for p in range(9))
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 30 + 2"
-        f" AS BIGINT) AS n FROM {tbl}),\n"
-        f"       ps AS (SELECT CAST(p AS BIGINT) AS p,"
-        f" CAST(w AS BIGINT) AS w\n"
-        f"         FROM (VALUES {ps}) t(p, w)),\n"
-        f"       c1 AS (SELECT CAST(1 AS BIGINT) AS lst,"
-        f" CAST(1 AS BIGINT) AS len,\n"
-        f"           CAST(1 AS BIGINT) AS pk FROM ps"
-        f" WHERE p = 0)")
-
-
-def _q623_stage(k: int, prev: str, ps: str) -> str:
-    """Extend every ascending chain by each distinct pair-sum
-    greater than its last element.  Digits unpack base-32 from
-    the packed chain (length k, positions 0..k-1)."""
-    dig = (f"(c.pk {{d}} pa.w) % 32")
-    djg = (f"(c.pk {{d}} pb.w) % 32")
-    return (
-        f"SELECT c.lst, c.len, c.pk, s.sm\n"
-        f"FROM (SELECT c.lst, c.len, c.pk,"
-        f" {dig} + {djg} AS sm\n"
-        f"      FROM {prev} c\n"
-        f"      JOIN {ps} pa ON pa.p < {k}\n"
-        f"      JOIN {ps} pb ON pb.p < {k}\n"
-        f"      GROUP BY c.lst, c.len, c.pk,"
-        f" {dig} + {djg}) u(lst, len, pk, sm)\n"
-        f"JOIN (SELECT 1 AS one) o ON true\n"
-        f"WHERE u.sm > u.lst")
-
-
-def _q623_oracle_build(tbl: str, d: str, mat: str):
-    parts = [_q623_base(tbl)]
-    prev = "c1"
-    for k in range(1, 8):
-        stage = (
-            f"SELECT sm AS lst, len + 1 AS len,"
-            f" pk*32 + sm AS pk FROM (\n"
-            f"         SELECT c.pk, c.lst, c.len,\n"
-            f"           (c.pk {d} pa.w) % 32 +"
-            f" (c.pk {d} pb.w) % 32 AS sm\n"
-            f"         FROM {prev} c\n"
-            f"         JOIN ps pa ON pa.p < {k}\n"
-            f"         JOIN ps pb ON pb.p < {k}\n"
-            f"         GROUP BY c.pk, c.lst, c.len,\n"
-            f"           (c.pk {d} pa.w) % 32 +"
-            f" (c.pk {d} pb.w) % 32) u\n"
-            f"       WHERE sm > lst AND sm <= 31")
-        parts.append(f"c{k + 1} AS{mat} ({stage})")
-        prev = f"c{k + 1}"
-    un = "\n         UNION ALL ".join(
-        f"SELECT lst, len, pk FROM c{k}" for k in range(1, 9))
-    parts.append(f"ca AS{mat} ({un})")
-    return parts
-
-
-def _q623_final(tbl: str, d: str, mat: str) -> str:
-    bit = lambda k: f"(n.n {d} {1 << k}) % 2"
-    nu = " + ".join(bit(k) for k in range(5))
-    lam = ("CASE WHEN n.n >= 16 THEN 4 WHEN n.n >= 8 THEN 3\n"
-           "           WHEN n.n >= 4 THEN 2 WHEN n.n >= 2 THEN 1"
-           " ELSE 0 END")
-    return (
-        f"ln AS{mat} (SELECT n.n,\n"
-        f"           CAST(min(c.len) - 1 AS BIGINT) AS l,\n"
-        f"           CAST({lam} AS BIGINT) AS lam,\n"
-        f"           CAST({nu} AS BIGINT) AS nu\n"
-        f"         FROM nd n JOIN ca c ON c.lst = n.n\n"
-        f"         GROUP BY n.n),\n"
-        f"       wt AS{mat} (SELECT l.n, l.l,\n"
-        f"           CAST(min(c.pk) AS BIGINT) AS wpk\n"
-        f"         FROM ln l JOIN ca c ON c.lst = l.n"
-        f" AND c.len = l.l + 1\n"
-        f"         GROUP BY l.n, l.l),\n"
-        # witness audit: every digit after the first must be a
-        # sum of two earlier digits, and the last must equal n
-        f"       wd AS{mat} (SELECT w.n, w.l, w.wpk, pp.p,\n"
-        f"           (w.wpk {d} pw.w) % 32 AS dv\n"
-        f"         FROM wt w JOIN ps pp ON pp.p <= w.l\n"
-        f"         JOIN ps pw ON pw.p = w.l - pp.p),\n"
-        f"       wv AS (SELECT CAST(sum(CASE WHEN miss = 1"
-        f" THEN 1 ELSE 0 END) AS BIGINT) AS witness_viol"
-        f" FROM (\n"
-        f"           SELECT a.n, a.p,\n"
-        f"             CASE WHEN a.p > 0 AND max(CASE WHEN\n"
-        f"               x.dv + y.dv = a.dv THEN 1 ELSE 0 END)"
-        f" = 0\n"
-        f"             THEN 1 ELSE 0 END AS miss\n"
-        f"           FROM wd a\n"
-        f"           JOIN wd x ON x.n = a.n AND x.p < a.p\n"
-        f"           JOIN wd y ON y.n = a.n AND y.p < a.p\n"
-        f"           GROUP BY a.n, a.p, a.dv) t),\n"
-        f"       lv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN l > lam + nu - 1 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS upper_viol,\n"
-        f"           CAST(sum(CASE WHEN l < lam THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS lower_viol,\n"
-        f"           CAST(sum(CASE WHEN l < lam + nu - 1 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS n_strict\n"
-        f"         FROM ln),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT l.n, l.l, l.lam, l.nu,\n"
-        f"       l.lam + l.nu - 1 AS binary_cost,\n"
-        f"       CAST(CASE WHEN l.l < l.lam + l.nu - 1 THEN 1\n"
-        f"         ELSE 0 END AS BIGINT) AS strict_better,\n"
-        f"       w.wpk AS witness,\n"
-        f"       v.witness_viol, x.upper_viol, x.lower_viol,\n"
-        f"       x.n_strict, d2.n_docs\n"
-        f"FROM ln l JOIN wt w ON w.n = l.n\n"
-        f"CROSS JOIN wv v CROSS JOIN lv x CROSS JOIN ld d2")
-
-
-def _q623_oracle(tbl: str = "documents") -> str:
-    parts = _q623_oracle_build(tbl, "//", " MATERIALIZED")
-    parts.append(_q623_final(tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q623_addition_chains", _q623_oracle())
-def q623(spark, sf_dir):
-    """Shortest addition chains — the true cost of computing x^n
-    — found by exhaustive BFS and compared against the binary
-    method for every n in 2..31 (Scholz 1937, Brauer 1939; Knuth
-    TAOCP 4.6.3 — the reason 'square-and-multiply is optimal' is
-    FALSE, and the cost model under q596/q618's modexp ladders).
-    All ascending addition chains of length <= 7 materialize by
-    staged extension: each chain (packed base-32) extends by
-    every DISTINCT pair-sum of its digits exceeding its last
-    element — ascending chains suffice for optimality, so the
-    7499 depth-7 chains exhaust the space — and l(n) = the
-    shortest chain ending at n.  Against the binary method's
-    lambda(n) + nu(n) - 1 (floor-log and popcount computed by
-    div/mod): upper_viol == 0 and lower_viol == 0 bracket every
-    l(n) in [lambda, lambda + nu - 1], and the strict-improvement
-    set is EXACTLY {15, 23, 27, 30, 31} (n_strict == 5) — n = 15
-    is the famous smallest case where a clever ladder (1 2 3 6
-    12 15, five multiplications) beats square-and-multiply's
-    six.  Each n's lexicographically-least optimal chain is
-    emitted as a packed witness and AUDITED structurally:
-    witness_viol == 0 re-verifies digit-by-digit that every
-    element is a sum of two earlier ones — the chain property
-    checked on the output, not assumed from the construction.
-    Scale: staged BFS with dedup-by-packing is frontier
-    expansion, the q600 shape with a combinatorial branching
-    factor."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q623_documents")
-    base = _q623_base("q623_documents")
-    for tv in ("nd", "ps", "c1"):
-        _pin_view(spark, f"WITH {base}\nSELECT * FROM {tv}",
-                  f"q623_{tv}")
-    prev = "q623_c1"
-    for k in range(1, 8):
-        _pin_view(spark,
-                  f"SELECT sm AS lst, len + 1 AS len,"
-                  f" pk*32 + sm AS pk FROM (\n"
-                  f"  SELECT c.pk, c.lst, c.len,\n"
-                  f"    (c.pk div pa.w) % 32 +"
-                  f" (c.pk div pb.w) % 32 AS sm\n"
-                  f"  FROM {prev} c\n"
-                  f"  JOIN q623_ps pa ON pa.p < {k}\n"
-                  f"  JOIN q623_ps pb ON pb.p < {k}\n"
-                  f"  GROUP BY c.pk, c.lst, c.len,\n"
-                  f"    (c.pk div pa.w) % 32 +"
-                  f" (c.pk div pb.w) % 32) u\n"
-                  f"WHERE sm > lst AND sm <= 31",
-                  f"q623_c{k + 1}", max_rows=8000)
-        prev = f"q623_c{k + 1}"
-    un = "\n UNION ALL ".join(
-        f"SELECT lst, len, pk FROM q623_c{k}"
-        for k in range(1, 9))
-    _pin_view(spark, un, "q623_ca", max_rows=10000)
-    fin = _q623_final("q623_documents", "div", "") \
-        .replace("FROM nd n", "FROM q623_nd n") \
-        .replace("JOIN ca c", "JOIN q623_ca c") \
-        .replace("JOIN ps pp", "JOIN q623_ps pp") \
-        .replace("JOIN ps pw", "JOIN q623_ps pw")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q624: HMM — forward/backward/exhaustive agreement, posterior vs
-# Viterbi disagreement
-
-
-# unique Viterbi optimum and unique per-position posterior argmax
-# (the first fixture's planted disagreement was TIE-dependent —
-# the exhaustive max had two winners, so the 'split' was an
-# artifact of the tie rule; searched again with uniqueness
-# enforced on both sides)
-_Q624_T = [[6, 3, 7], [1, 2, 9], [2, 6, 1]]
-_Q624_E = [[9, 4, 1, 2], [7, 7, 2, 4], [2, 9, 7, 1]]
-_Q624_PI = [2, 4, 1]
-_Q624_OBS = [3, 0, 1, 0, 1, 2]
-
-
-def _q624_sql(tbl: str, d: str, mat: str) -> str:
-    tv = ", ".join(f"({i}, {j}, {w})" for i, r in
-                   enumerate(_Q624_T) for j, w in enumerate(r))
-    ev = ", ".join(f"({s}, {o}, {w})" for s, r in
-                   enumerate(_Q624_E) for o, w in enumerate(r))
-    pv = ", ".join(f"({s}, {w})"
-                   for s, w in enumerate(_Q624_PI))
-    o1 = ", ".join(f"(1, {t}, {o})"
-                   for t, o in enumerate(_Q624_OBS))
-    parts = [
-        f"tm AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        f" BIGINT) AS j,\n"
-        f"           CAST(w AS BIGINT) AS w\n"
-        f"         FROM (VALUES {tv}) t(i, j, w))",
-        f"em AS (SELECT CAST(s AS BIGINT) AS s, CAST(o AS"
-        f" BIGINT) AS o,\n"
-        f"           CAST(w AS BIGINT) AS w\n"
-        f"         FROM (VALUES {ev}) t(s, o, w))",
-        f"pv AS (SELECT CAST(s AS BIGINT) AS s, CAST(w AS"
-        f" BIGINT) AS w\n"
-        f"         FROM (VALUES {pv}) t(s, w))",
-        # two sequences: the designed plant + a corpus-derived one
-        f"ob AS{mat} (SELECT CAST(sq AS BIGINT) AS sq,"
-        f" CAST(t AS BIGINT) AS t,\n"
-        f"           CAST(o AS BIGINT) AS o\n"
-        f"         FROM (VALUES {o1}) t(sq, t, o)\n"
-        f"         UNION ALL\n"
-        f"         SELECT CAST(2 AS BIGINT), doc_id % 6,\n"
-        f"           CAST(sum(n_chars) % 4 AS BIGINT)\n"
-        f"         FROM {tbl} GROUP BY doc_id % 6)",
-        # exhaustive: all 729 paths per sequence
-        f"x0 AS (SELECT o.sq, p.s AS lst,\n"
-        f"           p.w*e.w AS wt, p.s AS pth\n"
-        f"         FROM ob o JOIN pv p ON o.t = 0\n"
-        f"         JOIN em e ON e.s = p.s AND e.o = o.o)",
-    ]
-    for t in range(1, 6):
-        parts.append(
-            f"x{t} AS (SELECT x.sq, s.j AS lst,\n"
-            f"           x.wt*s.w*e.w AS wt, x.pth*3 + s.j"
-            f" AS pth\n"
-            f"         FROM x{t - 1} x JOIN ob o ON o.sq = x.sq"
-            f" AND o.t = {t}\n"
-            f"         JOIN tm s ON s.i = x.lst\n"
-            f"         JOIN em e ON e.s = s.j AND e.o = o.o)")
-    parts.append(
-        f"xa AS{mat} (SELECT sq, CAST(sum(wt) AS BIGINT)"
-        f" AS total,\n"
-        f"           CAST(max(wt*1024 + pth) % 1024 AS BIGINT)"
-        f" AS vit_pth,\n"
-        f"           CAST(max(wt*1024 + pth) {d} 1024 AS BIGINT)"
-        f" AS vit_w,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_paths\n"
-        f"         FROM x5 GROUP BY sq)")
-    # forward chain
-    parts.append(
-        "f0 AS (SELECT o.sq, p.s, p.w*e.w AS f\n"
-        "         FROM ob o JOIN pv p ON o.t = 0\n"
-        "         JOIN em e ON e.s = p.s AND e.o = o.o)")
-    for t in range(1, 6):
-        parts.append(
-            f"f{t} AS (SELECT f.sq, s.j AS s,\n"
-            f"           CAST(sum(f.f*s.w*e.w) AS BIGINT) AS f\n"
-            f"         FROM f{t - 1} f JOIN ob o ON o.sq = f.sq"
-            f" AND o.t = {t}\n"
-            f"         JOIN tm s ON s.i = f.s\n"
-            f"         JOIN em e ON e.s = s.j AND e.o = o.o\n"
-            f"         GROUP BY f.sq, s.j)")
-    # backward chain
-    parts.append(
-        "b5 AS (SELECT o.sq, p.s, CAST(1 AS BIGINT) AS b\n"
-        "         FROM ob o JOIN pv p ON o.t = 0)")
-    for t in range(4, -1, -1):
-        parts.append(
-            f"b{t} AS (SELECT b.sq, s.i AS s,\n"
-            f"           CAST(sum(s.w*e.w*b.b) AS BIGINT) AS b\n"
-            f"         FROM b{t + 1} b JOIN ob o ON o.sq = b.sq"
-            f" AND o.t = {t + 1}\n"
-            f"         JOIN tm s ON s.j = b.s\n"
-            f"         JOIN em e ON e.s = b.s AND e.o = o.o\n"
-            f"         GROUP BY b.sq, s.i)")
-    fb = "\n         UNION ALL ".join(
-        f"SELECT f.sq, CAST({t} AS BIGINT) AS t, f.s,"
-        f" f.f, b.b\n"
-        f"         FROM f{t} f JOIN b{t} b ON b.sq = f.sq"
-        f" AND b.s = f.s"
-        for t in range(6))
-    parts.append(f"fb AS{mat} ({fb})")
-    parts.append(
-        f"tot AS (SELECT x.sq,\n"
-        f"           CAST(sum(CASE WHEN f.t = 5 THEN f.f ELSE 0"
-        f" END) AS BIGINT) AS fwd_total\n"
-        f"         FROM xa x JOIN fb f ON f.sq = x.sq"
-        f" GROUP BY x.sq)")
-    parts.append(
-        f"inv AS (SELECT sq, CAST(sum(CASE WHEN tt <> 0 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS fb_inv_viol FROM (\n"
-        f"           SELECT f.sq, f.t, sum(f.f*f.b)\n"
-        f"             - max(x.total) AS tt\n"
-        f"           FROM fb f JOIN xa x ON x.sq = f.sq\n"
-        f"           GROUP BY f.sq, f.t) u GROUP BY sq)")
-    parts.append(
-        f"pst AS{mat} (SELECT sq, t,\n"
-        f"           CAST(3 - max(f*b*4 + (3 - s)) % 4"
-        f" AS BIGINT) AS post_s\n"
-        f"         FROM fb GROUP BY sq, t)")
-    parts.append(
-        f"dis AS (SELECT p.sq,\n"
-        f"           CAST(sum(CASE WHEN p.post_s <>\n"
-        f"             (x.vit_pth {d} pw.p) % 3 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_disagree\n"
-        f"         FROM pst p JOIN xa x ON x.sq = p.sq\n"
-        f"         JOIN (SELECT CAST(t AS BIGINT) AS t,"
-        f" CAST(p AS BIGINT) AS p FROM (VALUES\n"
-        f"           (0, 243), (1, 81), (2, 27), (3, 9),"
-        f" (4, 3), (5, 1)) v(t, p)) pw ON pw.t = p.t\n"
-        f"         GROUP BY p.sq)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT p.sq, p.t, p.post_s,\n"
-        f"       CAST((x.vit_pth {d} pw.p) % 3 AS BIGINT)"
-        f" AS vit_s,\n"
-        f"       x.total, t2.fwd_total,\n"
-        f"       t2.fwd_total - x.total AS fwd_resid,\n"
-        f"       x.vit_w, x.n_paths, i.fb_inv_viol,\n"
-        f"       d2.n_disagree, l.n_docs\n"
-        f"FROM pst p JOIN xa x ON x.sq = p.sq\n"
-        f"JOIN tot t2 ON t2.sq = p.sq\n"
-        f"JOIN inv i ON i.sq = p.sq\n"
-        f"JOIN dis d2 ON d2.sq = p.sq\n"
-        f"JOIN (SELECT CAST(t AS BIGINT) AS t, CAST(p AS BIGINT)"
-        f" AS p FROM (VALUES\n"
-        f"  (0, 243), (1, 81), (2, 27), (3, 9), (4, 3), (5, 1))"
-        f" v(t, p)) pw ON pw.t = p.t\n"
-        f"CROSS JOIN ld l")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q624_hmm_forward_backward",
-       "WITH " + _q624_sql("documents", "//", " MATERIALIZED"))
-def q624(spark, sf_dir):
-    """HMM inference with three total-likelihood machines forced
-    to agree and the posterior-vs-Viterbi split planted (Baum
-    1966, Viterbi 1967, Rabiner 1989 — and the distinction every
-    sequence tagger trips on: the most likely PATH is not the
-    path of most likely STATES).  Weights are integers, so every
-    quantity is exact: two observation sequences — one designed,
-    one derived from real corpus aggregates — flow through (a)
-    EXHAUSTIVE enumeration of all 729 state paths (6 chained
-    joins, path packed base-3, weight products in BIGINT), (b)
-    the forward recursion, (c) the backward recursion.
-    fwd_resid == 0 ties forward to the exhaustive total, and
-    fb_inv_viol == 0 checks the stronger per-position invariant
-    sum_s f_t(s) b_t(s) == total at EVERY t — the identity that
-    makes posterior marginals well-defined, checked six times
-    per sequence rather than once at the end.  Viterbi's best
-    weight comes from the exhaustive packed max (vit_w), and the
-    output emits, position by position, the Viterbi state beside
-    the posterior argmax f_t b_t: on the designed sequence they
-    DISAGREE at exactly n_disagree == 3 positions (both
-    optima UNIQUE by design — a tie-dependent split would be an
-    artifact of the tie rule, not a theorem) — the planted
-    demonstration that per-state and whole-path optimization are
-    different objectives, each correct for its own loss.  Scale:
-    forward/backward are 3-row-per-step linear chains (the
-    streaming shape); the exhaustion is the certificate."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q624_documents")
-    # ob aggregates the corpus and is referenced by all 18 chain
-    # stages — pin it so the scan happens once, not per reference
-    sql = _q624_sql("q624_documents", "div", "")
-    head, tail = sql.split("ob AS (", 1)
-    ob_body, tail = tail.split("),\n       x0 AS", 1)
-    _pin_view(spark, ob_body, "q624_ob")
-    sql = head + "x0 AS" + tail
-    sql = re.sub(r"\bob\b", "q624_ob", sql)
-    return spark.sql("WITH " + sql)
-
-
-# ---------------------------------------------------------------------------
-# q625: inclusion-exclusion, Bonferroni bounds, Möbius inversion
-
-
-_Q625_WORDS = ["key", "window", "merge", "sort"]
-
-
-def _q625_sql(tbl: str, d: str, mat: str) -> str:
-    flags = ",\n           ".join(
-        f"CAST(CASE WHEN instr(' ' || text || ' ', ' {w} ') > 0"
-        f" THEN 1 ELSE 0 END AS BIGINT) AS f{i}"
-        for i, w in enumerate(_Q625_WORDS))
-    pat = " + ".join(f"f{i}*{1 << i}" for i in range(4))
-    sub = ", ".join(f"({m})" for m in range(16))
-    popc = " + ".join(f"(s.m {{d}} {1 << k}) % 2"
-                      for k in range(4))
-    # membership of doc in intersection T: all bits of T present
-    inT = " * ".join(
-        f"(CASE WHEN (s.m {{d}} {1 << k}) % 2 = 1 THEN d2.f{k}"
-        f" ELSE 1 END)" for k in range(4))
-    return (
-        f"fl AS{mat} (SELECT doc_id, {flags},\n"
-        f"           CAST(0 AS BIGINT) AS z FROM {tbl}),\n"
-        f"       fp AS{mat} (SELECT doc_id, f0, f1, f2, f3,\n"
-        f"           {pat} AS pat FROM fl),\n"
-        f"       sd AS (SELECT CAST(m AS BIGINT) AS m FROM\n"
-        f"           (VALUES {sub}) t(m)),\n"
-        # |intersection over T| for every subset T (16 counts)
-        f"       ic AS{mat} (SELECT s.m,"
-        f" CAST({popc.format(d=d)} AS BIGINT) AS sz,\n"
-        f"           CAST(sum({inT.format(d=d)}) AS BIGINT)"
-        f" AS cnt\n"
-        f"         FROM sd s CROSS JOIN fp d2"
-        f" GROUP BY s.m),\n"
-        # direct union / none counts
-        f"       un AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN pat > 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS union_direct,\n"
-        f"           CAST(sum(CASE WHEN pat = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS none_direct,\n"
-        f"           CAST(count(*) AS BIGINT) AS n\n"
-        f"         FROM fp),\n"
-        # Bonferroni partial sums S1..S4 (signed prefix sums)
-        f"       bs AS{mat} (SELECT k.k,\n"
-        f"           CAST(sum(CASE WHEN i.sz BETWEEN 1 AND k.k\n"
-        f"             THEN CASE WHEN i.sz % 2 = 1 THEN i.cnt\n"
-        f"               ELSE -i.cnt END ELSE 0 END) AS BIGINT)"
-        f" AS bnd\n"
-        f"         FROM (SELECT CAST(m AS BIGINT) AS k FROM\n"
-        f"           (VALUES (1), (2), (3), (4)) t(m)) k\n"
-        f"         CROSS JOIN ic i GROUP BY k.k),\n"
-        f"       bv AS (SELECT CAST(sum(CASE\n"
-        f"           WHEN b.k % 2 = 1 AND b.bnd < u.union_direct"
-        f" THEN 1\n"
-        f"           WHEN b.k % 2 = 0 AND b.bnd > u.union_direct"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS bonf_viol,\n"
-        f"           CAST(max(CASE WHEN b.k = 4 THEN b.bnd END)\n"
-        f"             - max(u.union_direct) AS BIGINT)"
-        f" AS ie_resid\n"
-        f"         FROM bs b CROSS JOIN un u),\n"
-        # Möbius inversion: every atom count from the upward sums
-        f"       at AS{mat} (SELECT s.m,"
-        f" CAST(count(*) AS BIGINT) AS direct\n"
-        f"         FROM sd s LEFT JOIN fp d2 ON d2.pat = s.m\n"
-        f"         GROUP BY s.m),\n"
-        f"       mo AS{mat} (SELECT s.m,\n"
-        f"           CAST(sum(CASE WHEN\n"
-        f"             ({' + '.join(f'((t.m {{d}} {1 << k}) % 2)*(1 - (s.m {{d}} {1 << k}) % 2)' for k in range(4)).format(d=d)}) % 2 = 0\n"
-        f"             THEN i.cnt ELSE -i.cnt END) AS BIGINT)"
-        f" AS moeb\n"
-        f"         FROM sd s JOIN sd t ON\n"
-        f"           ({' * '.join(f'(CASE WHEN (s.m {{d}} {1 << k}) % 2 = 1 THEN (t.m {{d}} {1 << k}) % 2 ELSE 1 END)' for k in range(4)).format(d=d)}) = 1\n"
-        f"         JOIN ic i ON i.m = t.m GROUP BY s.m),\n"
-        f"       mv AS (SELECT CAST(sum(CASE WHEN a.direct <>\n"
-        f"           coalesce(o.moeb, 0) - CASE WHEN a.m = 0"
-        f" THEN 0 ELSE 0 END\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS atom_viol\n"
-        f"         FROM at a JOIN mo o ON o.m = a.m\n"
-        f"         WHERE a.m > 0),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT i.m, i.sz, i.cnt,\n"
-        f"       b.bnd AS bonf_bound_szk,\n"
-        f"       u.union_direct, u.none_direct, u.n,\n"
-        f"       v.bonf_viol, v.ie_resid, w.atom_viol,\n"
-        f"       a.direct AS atom_direct, o.moeb AS atom_moebius,"
-        f"\n"
-        f"       l.n_docs\n"
-        f"FROM ic i LEFT JOIN bs b ON b.k = i.sz\n"
-        f"JOIN at a ON a.m = i.m\n"
-        f"JOIN mo o ON o.m = i.m\n"
-        f"CROSS JOIN un u CROSS JOIN bv v CROSS JOIN mv w\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q625_inclusion_exclusion",
-       "WITH " + _q625_sql("documents", "//", " MATERIALIZED"))
-def q625(spark, sf_dir):
-    """Inclusion-exclusion, the Bonferroni inequalities, and
-    Möbius inversion on the Boolean lattice — all on real data
-    (da Silva 1854, Bonferroni 1936, Rota 1964; the counting
-    identities under every multi-filter selectivity estimate).
-    The four events are real: documents containing each of four
-    corpus words (space-padded instr, no tokenizer), giving 16
-    intersection counts |∩T| in ONE pass (subset dim x per-doc
-    flags, membership as a product of CASEs).  ie_resid == 0 is
-    the full inclusion-exclusion identity — the 15 signed terms
-    reassemble the directly-counted union exactly — and the
-    Bonferroni partial sums S1, S1-S2, S1-S2+S3, all four
-    levels, alternate around the truth as the inequalities
-    demand (bonf_viol == 0: odd truncations over, even
-    truncations under — the bounds a selectivity estimator
-    actually uses when it stops early).  The deeper identity is
-    checked atom by atom: for EVERY membership pattern S, the
-    Möbius sum over supersets sum_{T >= S} (-1)^{|T - S|} |∩T|
-    must equal the direct count of documents with EXACTLY
-    pattern S (atom_viol == 0 over all 15 nonempty atoms) —
-    Möbius inversion verified as 15 simultaneous integer
-    identities on corpus data, not one aggregate.  Scale: one
-    scan computes the flags; the lattice algebra is a 16x16
-    broadcast dim join — the same plan prices any k-filter
-    combination from k single-scan counts."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q625_documents")
-    return spark.sql(
-        "WITH " + _q625_sql("q625_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q626: Pascal's triangle — Lucas, Kummer, Glaisher, Vandermonde
-
-
-def _q626_base(tbl: str) -> str:
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 33 AS BIGINT)"
-        f" AS n FROM {tbl}),\n"
-        f"       p0 AS (SELECT CAST(0 AS BIGINT) AS n,"
-        f" CAST(0 AS BIGINT) AS k,\n"
-        f"           CAST(1 AS BIGINT) AS c FROM nd WHERE n = 0)")
-
-
-def _q626_row(n: int, prev: str) -> str:
-    return (
-        f"SELECT CAST({n} AS BIGINT) AS n, k, CAST(sum(c)"
-        f" AS BIGINT) AS c FROM (\n"
-        f"  SELECT k + 1 AS k, c FROM {prev}\n"
-        f"  UNION ALL SELECT k, c FROM {prev}) t GROUP BY k")
-
-
-def _q626_final(pu: str, tbl: str, d: str, mat: str) -> str:
-    # base-3 digits and the carry chain for Kummer
-    dig = lambda x, j: f"(({x}) {d} {3 ** j}) % 3"
-    # binomial C(a,b) for a,b in 0..2 as a CASE expression
-    def c3(a, b):
-        return (f"(CASE WHEN {b} > {a} THEN 0"
-                f" WHEN {b} = 1 AND {a} = 2 THEN 2 ELSE 1 END)")
-    lucas = " * ".join(c3(dig("p.n", j), dig("p.k", j))
-                       for j in range(4))
-    carries = []
-    carry = "0"
-    for j in range(4):
-        s = (f"({dig('p.k', j)} + {dig('(p.n - p.k)', j)}"
-             f" + {carry})")
-        carry = f"(CASE WHEN {s} >= 3 THEN 1 ELSE 0 END)"
-        carries.append(carry)
-    ncar = " + ".join(carries)
-    v3 = ("CASE WHEN p.c % 27 = 0 THEN 3 WHEN p.c % 9 = 0"
-          " THEN 2\n"
-          "             WHEN p.c % 3 = 0 THEN 1 ELSE 0 END")
-    popc = " + ".join(f"(r.n {d} {1 << j}) % 2" for j in range(6))
-    return (
-        f"lkv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN p.c % 3 <>"
-        f" ({lucas}) % 3\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS lucas_viol,\n"
-        f"           CAST(sum(CASE WHEN ({v3}) <> ({ncar})"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS kummer_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_pairs\n"
-        f"         FROM {pu} p WHERE p.n <= 32),\n"
-        f"       rws AS{mat} (SELECT p.n,\n"
-        f"           CAST(sum(p.c) AS BIGINT) AS row_sum,\n"
-        f"           CAST(sum(p.c % 2) AS BIGINT) AS n_odd\n"
-        f"         FROM {pu} p WHERE p.n <= 32 GROUP BY p.n),\n"
-        f"       pw2 AS (SELECT CAST(x AS BIGINT) AS x,"
-        f" CAST(p AS BIGINT) AS p FROM (VALUES\n"
-        f"           " + ", ".join(f"({x}, {1 << x})"
-                                   for x in range(33)) + ")"
-        f" t(x, p)),\n"
-        f"       rsv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN r.row_sum <> w.p THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS rowsum_viol,\n"
-        f"           CAST(sum(CASE WHEN r.n_odd <> g.p THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS glaisher_viol\n"
-        f"         FROM rws r JOIN pw2 w ON w.x = r.n\n"
-        f"         JOIN pw2 g ON g.x = ({popc})),\n"
-        f"       hkv AS (SELECT CAST(sum(CASE WHEN t.s <> q.c\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS hockey_viol FROM (\n"
-        f"           SELECT r.n, r.k, sum(i.c) AS s\n"
-        f"           FROM {pu} r JOIN {pu} i\n"
-        f"             ON i.k = r.k AND i.n BETWEEN r.k AND r.n\n"
-        f"           WHERE r.n <= 32 GROUP BY r.n, r.k) t\n"
-        f"         JOIN {pu} q ON q.n = t.n + 1"
-        f" AND q.k = t.k + 1),\n"
-        f"       vdv AS (SELECT CAST(sum(CASE WHEN t.s <> q.c\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS vander_viol FROM (\n"
-        f"           SELECT a.n AS m, b.n AS n2,"
-        f" a.k + b.k AS r,\n"
-        f"             sum(a.c*b.c) AS s\n"
-        f"           FROM {pu} a JOIN {pu} b\n"
-        f"             ON a.n <= 16 AND b.n <= 16\n"
-        f"           GROUP BY a.n, b.n, a.k + b.k) t\n"
-        f"         JOIN {pu} q ON q.n = t.m + t.n2"
-        f" AND q.k = t.r),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT r.n, r.row_sum, r.n_odd,\n"
-        f"       l.lucas_viol, l.kummer_viol, l.n_pairs,\n"
-        f"       s.rowsum_viol, s.glaisher_viol,\n"
-        f"       h.hockey_viol, v.vander_viol, d2.n_docs\n"
-        f"FROM rws r CROSS JOIN lkv l CROSS JOIN rsv s\n"
-        f"CROSS JOIN hkv h CROSS JOIN vdv v CROSS JOIN ld d2")
-
-
-def _q626_oracle(tbl: str = "documents") -> str:
-    parts = [_q626_base(tbl)]
-    prev = "p0"
-    for n in range(1, 34):
-        parts.append(f"p{n} AS MATERIALIZED"
-                     f" ({_q626_row(n, prev)})")
-        prev = f"p{n}"
-    un = "\n         UNION ALL ".join(
-        f"SELECT n, k, c FROM p{n}" for n in range(34))
-    parts.append(f"pu AS MATERIALIZED ({un})")
-    parts.append(_q626_final("pu", tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q626_pascal_identities", _q626_oracle())
-def q626(spark, sf_dir):
-    """Pascal's triangle as a theorem factory — five classical
-    identities verified over every entry of 33 exactly-computed
-    rows (Lucas 1878, Kummer 1852, Glaisher 1899, Vandermonde
-    1772; the binomial structure under hierarchical-aggregation
-    counting).  The triangle builds by 33 staged shifted-sum
-    rows (exact BIGINT to C(33,16)); then, with no value reused
-    between checks: (1) LUCAS — C(n,k) mod 3 equals the product
-    of digit binomials in base 3, all 561 pairs, digits by
-    div/mod and the digit binomial as a closed CASE; (2) KUMMER
-    — the exact 3-adic valuation of C(n,k) (divisibility CASE,
-    max valuation 3 in range) equals the number of CARRIES when
-    adding k and n-k in base 3, the carry chain unrolled as four
-    nested CASE expressions — a statement connecting divisibility
-    to grade-school addition, checked exhaustively; (3) GLAISHER
-    — each row's count of odd entries is exactly 2^popcount(n)
-    (the Sierpinski fractal's census), beside the row-sum
-    identity sum = 2^n; (4) the HOCKEY STICK — every column's
-    partial sums telescope to the next diagonal entry, all 561
-    (n,r); (5) VANDERMONDE — C(m+n,r) = sum C(m,k)C(n,r-k)
-    verified for all m,n <= 16 and every r as one grouped
-    convolution join.  Scale: the triangle is dim-sized; every
-    identity is one join + one aggregation over it — the pattern
-    for validating any precomputed combinatorial lookup table
-    before a fleet trusts it."""
-    # Round-5 (the q598/q642 pattern): Pascal's triangle to n=33
-    # builds driver-side by the identical additive recurrence
-    # (exact Python BIGINTs; corpus dim asserted), and every
-    # identity census in the final statement — row sums,
-    # hockey-stick, Vandermonde, symmetry — stays relational over
-    # the pushed 595-row table.  Formerly 19 batched pins, 4.2 s.
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q626_documents")
-    nrow = spark.sql("SELECT count(DISTINCT doc_id % 33) AS n"
-                     " FROM q626_documents").collect()[0]["n"]
-    assert nrow == 33, nrow
-    rows, prev = [(0, 0, 1)], {0: 1}
-    for n in range(1, 34):
-        cur = {k: prev.get(k - 1, 0) + prev.get(k, 0)
-               for k in range(n + 1)}
-        rows += [(n, k, c) for k, c in sorted(cur.items())]
-        prev = cur
-    local_df(spark, rows, "n long, k long, c long") \
-        .createOrReplaceTempView("q626_pu")
-    fin = _q626_final("q626_pu", "q626_documents", "div", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q627: Fenwick tree — binary-indexed prefix sums, structure certified
-
-
-def _q627_base(tbl: str) -> str:
-    pw = ", ".join(f"({x}, {1 << x})" for x in range(9))
-    return (
-        f"ar AS (SELECT doc_id + 1 AS i, CAST(n_chars AS BIGINT)"
-        f" AS v\n"
-        f"         FROM {tbl} WHERE doc_id < 256),\n"
-        f"       pw AS (SELECT CAST(x AS BIGINT) AS x,"
-        f" CAST(p AS BIGINT) AS p\n"
-        f"         FROM (VALUES {pw}) t(x, p)),\n"
-        # lowbit(i) = largest power of two dividing i
-        f"       lb AS (SELECT a.i, max(w.p) AS lob\n"
-        f"         FROM ar a JOIN pw w ON a.i % w.p = 0\n"
-        f"         GROUP BY a.i),\n"
-        # Fenwick cell contents: F(i) = sum over (i - lowbit, i]\n"
-        f"       fw AS (SELECT l.i, l.lob,\n"
-        f"           CAST(sum(a.v) AS BIGINT) AS f\n"
-        f"         FROM lb l JOIN ar a\n"
-        f"           ON a.i > l.i - l.lob AND a.i <= l.i\n"
-        f"         GROUP BY l.i, l.lob)")
-
-
-def _q627_walk(prev: str, fw: str) -> str:
-    """One query-walk step: strip the lowbit, accumulate."""
-    return (
-        f"SELECT w.q, f.i - f.lob AS cur,\n"
-        f"       w.acc + f.f AS acc, w.stepn + 1 AS stepn\n"
-        f"FROM {prev} w JOIN {fw} f ON f.i = w.cur\n"
-        f"WHERE w.cur > 0\n"
-        f"UNION ALL\n"
-        f"SELECT q, cur, acc, stepn FROM {prev} WHERE cur = 0")
-
-
-def _q627_final(wF: str, tbl: str, d: str, mat: str) -> str:
-    popc = " + ".join(f"(q.q {d} {1 << j}) % 2" for j in range(9))
-    return (
-        f"pfx AS{mat} (SELECT a.i AS q,"
-        f" CAST(sum(b.v) AS BIGINT) AS direct\n"
-        f"         FROM ar a JOIN ar b ON b.i <= a.i\n"
-        f"         GROUP BY a.i),\n"
-        f"       qv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN w.acc <> p.direct"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS prefix_viol,\n"
-        f"           CAST(sum(CASE WHEN w.cur <> 0 THEN 1"
-        f" ELSE 0 END)\n"
-        f"             AS BIGINT) AS unfinished,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_queries\n"
-        f"         FROM {wF} w JOIN pfx p ON p.q = w.q),\n"
-        f"       plv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN w.stepn <> ({popc})"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS pathlen_viol\n"
-        f"         FROM {wF} w JOIN (SELECT i AS q FROM ar) q\n"
-        f"           ON q.q = w.q),\n"
-        # THE correctness argument: for every j <= i, EXACTLY one
-        # cell on i's query path contains j; for j > i, none.
-        # Query-path cells of i = cells visited by the walk —
-        # reconstruct them as the distinct f.i values: a cell c
-        # is on i's path iff c = i with trailing bits stripped,
-        # equivalently i - (i % lowbit-multiple)... verified here
-        # by the range test against the walk-visited cells.
-        f"       pc AS{mat} (SELECT a.i AS q, c.i AS cell,\n"
-        f"           c.lob FROM ar a JOIN fw c\n"
-        f"           ON c.i <= a.i\n"
-        f"           AND c.i = (a.i {d} c.lob)*c.lob\n"
-        f"           AND (a.i {d} (c.lob*2))*(c.lob*2) <"
-        f" c.i),\n"
-        f"       ov AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN t.nc <> 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS cover_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_cover_pairs\n"
-        f"         FROM (SELECT a.i AS q, j.i AS j,\n"
-        f"             CAST(count(*) AS BIGINT) AS nc\n"
-        f"           FROM ar a JOIN ar j ON j.i <= a.i\n"
-        f"           JOIN pc p ON p.q = a.i\n"
-        f"             AND j.i > p.cell - p.lob"
-        f" AND j.i <= p.cell\n"
-        f"           GROUP BY a.i, j.i) t),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT w.q, w.acc, w.stepn,\n"
-        f"       v.prefix_viol, v.unfinished, v.n_queries,\n"
-        f"       p2.pathlen_viol, o.cover_viol,"
-        f" o.n_cover_pairs,\n"
-        f"       l.n_docs\n"
-        f"FROM {wF} w CROSS JOIN qv v CROSS JOIN plv p2\n"
-        f"CROSS JOIN ov o CROSS JOIN ld l\n"
-        f"WHERE w.q <= 16")
-    # (pc: a cell c is on i's query path iff c = floor(i /
-    # lowbit(c)) * lowbit(c) AND the next-higher bit of i below
-    # lowbit(c)*2 rounds below c — i.e. c is a maximal stripped
-    # prefix; both conditions expressed with div/mod.)
-
-
-def _q627_oracle(tbl: str = "documents") -> str:
-    parts = [_q627_base(tbl)]
-    parts.append(
-        "w0 AS MATERIALIZED (SELECT i AS q, i AS cur,"
-        " CAST(0 AS BIGINT) AS acc,\n"
-        "       CAST(0 AS BIGINT) AS stepn FROM ar)")
-    prev = "w0"
-    for s in range(1, 10):
-        parts.append(f"w{s} AS MATERIALIZED"
-                     f" ({_q627_walk(prev, 'fw')})")
-        prev = f"w{s}"
-    parts.append(_q627_final(prev, tbl, "//", " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q627_fenwick_tree", _q627_oracle())
-def q627(spark, sf_dir):
-    """Fenwick (binary-indexed) tree over real document lengths,
-    with the structure theorems that make it work verified by
-    exhaustion (Fenwick 1994; the O(log n) prefix-sum index
-    inside every rank tracker and order-statistics service).
-    The array is the first 256 documents' n_chars; lowbit(i)
-    computes relationally (largest power-of-two divisor via a
-    power dim), each cell F(i) sums its half-open window
-    (i - lowbit(i), i] by a range join, and every one of the 256
-    prefix queries walks the strip-the-lowbit chain through 9
-    unrolled join stages.  prefix_viol == 0 checks all 256
-    query results against direct prefix sums; unfinished == 0
-    certifies every walk terminated at zero within log2(256)
-    steps; pathlen_viol == 0 pins the sharper claim that query
-    i's walk takes EXACTLY popcount(i) steps — the binary
-    decomposition made visible.  The deepest check is the
-    coverage bijection that IS the data structure's correctness
-    argument: for every pair j <= i, exactly ONE cell on i's
-    query path contains index j (cover_viol == 0 over all
-    n_cover_pairs ~ 33k pairs, path cells characterized in
-    closed form by div/mod: c = floor(i/lowbit(c))*lowbit(c)
-    with the next bit rounding below) — each element counted
-    once, none counted twice, none missed, exhaustively.
-    Scale: construction is one range join; queries are
-    log-depth chains — the index shape that serves point
-    lookups over append-heavy aggregates."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q627_documents")
-    base = _q627_base("q627_documents")
-    for tv in ("ar", "pw", "fw"):
-        _pin_view(spark, f"WITH {base}\nSELECT * FROM {tv}",
-                  f"q627_{tv}")
-    _pin_view(spark,
-              "SELECT i AS q, i AS cur, CAST(0 AS BIGINT)"
-              " AS acc,\n"
-              "       CAST(0 AS BIGINT) AS stepn FROM q627_ar",
-              "q627_w0")
-    prev = "q627_w0"
-    for s in range(1, 10):
-        _pin_view(spark, _q627_walk(prev, "q627_fw"),
-                  f"q627_w{s}")
-        prev = f"q627_w{s}"
-    fin = _q627_final(prev, "q627_documents", "div", "") \
-        .replace("FROM ar a", "FROM q627_ar a") \
-        .replace("JOIN ar b", "JOIN q627_ar b") \
-        .replace("JOIN ar j", "JOIN q627_ar j") \
-        .replace("JOIN fw c", "JOIN q627_fw c") \
-        .replace("(SELECT i AS q FROM ar)",
-                 "(SELECT i AS q FROM q627_ar)")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q628: Huffman coding — greedy merges vs Kraft-space exhaustion
-
-
-_Q628_EDGES = [(0, 32), (32, 48), (48, 56), (56, 60), (60, 62),
-               (62, 63)]
-
-
-def _q628_sql(tbl: str, d: str, mat: str) -> str:
-    cls = " ".join(
-        f"WHEN doc_id % 63 >= {a} AND doc_id % 63 < {b}"
-        f" THEN {i}" for i, (a, b) in enumerate(_Q628_EDGES))
-    ldim = ", ".join(f"({x})" for x in range(1, 7))
-    l6 = " CROSS JOIN ".join(f"ld{i}" for i in range(6))
-    parts = [
-        f"fr AS{mat} (SELECT CAST(CASE {cls} END AS BIGINT)"
-        f" AS i,\n"
-        f"           CAST(count(*) AS BIGINT) AS f\n"
-        f"         FROM {tbl} GROUP BY CASE {cls} END)",
-        f"h0 AS{mat} (SELECT i AS id, f AS w,"
-        f" CAST(1 AS BIGINT)*0 + CASE\n"
-        + "".join(f"           WHEN i = {k} THEN {1 << k}\n"
-                  for k in range(6))
-        + f"           END AS mask FROM fr)",
-    ]
-    for r in range(1, 6):
-        parts.append(
-            f"pa{r} AS{mat} (SELECT min(w*64 + id) AS p1"
-            f" FROM h{r - 1})")
-        parts.append(
-            f"pb{r} AS{mat} (SELECT min(h.w*64 + h.id) AS p2\n"
-            f"         FROM h{r - 1} h CROSS JOIN pa{r} a\n"
-            f"         WHERE h.w*64 + h.id > a.p1)")
-        parts.append(
-            f"mg{r} AS{mat} (SELECT CAST({r} AS BIGINT) AS rnd,\n"
-            f"           CAST(sum(h.w) AS BIGINT) AS w,\n"
-            f"           CAST(sum(h.mask) AS BIGINT) AS mask\n"
-            f"         FROM h{r - 1} h CROSS JOIN pa{r} a"
-            f" CROSS JOIN pb{r} b\n"
-            f"         WHERE h.w*64 + h.id = a.p1"
-            f" OR h.w*64 + h.id = b.p2)")
-        parts.append(
-            f"h{r} AS{mat} (SELECT h.id, h.w, h.mask\n"
-            f"         FROM h{r - 1} h CROSS JOIN pa{r} a"
-            f" CROSS JOIN pb{r} b\n"
-            f"         WHERE h.w*64 + h.id <> a.p1"
-            f" AND h.w*64 + h.id <> b.p2\n"
-            f"         UNION ALL\n"
-            f"         SELECT CAST({5 + r} AS BIGINT), w, mask"
-            f" FROM mg{r})")
-    mgu = "\n         UNION ALL ".join(
-        f"SELECT rnd, mask FROM mg{r}" for r in range(1, 6))
-    parts.append(f"mgu AS{mat} ({mgu})")
-    parts.append(
-        f"hl AS{mat} (SELECT f.i, f.f,\n"
-        f"           CAST(sum((m.mask {d} CASE\n"
-        + "".join(f"             WHEN f.i = {k} THEN {1 << k}\n"
-                  for k in range(6))
-        + f"             END) % 2) AS BIGINT) AS len\n"
-        f"         FROM fr f CROSS JOIN mgu m"
-        f" GROUP BY f.i, f.f)")
-    parts.append(
-        "hc AS (SELECT CAST(sum(f*len) AS BIGINT)"
-        " AS huff_cost,\n"
-        "           CAST(sum(CASE len WHEN 1 THEN 32 WHEN 2"
-        " THEN 16\n"
-        "             WHEN 3 THEN 8 WHEN 4 THEN 4 WHEN 5 THEN 2\n"
-        "             WHEN 6 THEN 1 END) AS BIGINT) AS kraft64,\n"
-        "           CAST(sum(3*f) AS BIGINT) AS fixed_cost\n"
-        "         FROM hl)")
-    for i in range(6):
-        parts.append(f"ld{i} AS (SELECT CAST(x AS BIGINT)"
-                     f" AS l{i} FROM (VALUES {ldim}) t(x))")
-    kraft = " + ".join(
-        f"CASE l{i} WHEN 1 THEN 32 WHEN 2 THEN 16 WHEN 3 THEN 8"
-        f" WHEN 4 THEN 4 WHEN 5 THEN 2 ELSE 1 END"
-        for i in range(6))
-    cost = " + ".join(
-        f"f{i}.f*l{i}" for i in range(6))
-    fj = "\n         ".join(
-        f"JOIN fr f{i} ON f{i}.i = {i}" for i in range(6))
-    parts.append(
-        f"ka AS{mat} (SELECT {cost} AS cost,\n"
-        + ",\n".join(f"           l{i}" for i in range(6)) + "\n"
-        f"         FROM {l6}\n"
-        f"         {fj}\n"
-        f"         WHERE ({kraft}) = 64)")
-    parts.append(
-        "ex AS (SELECT CAST(min(cost) AS BIGINT) AS exh_opt,\n"
-        "           CAST(count(*) AS BIGINT) AS n_kraft"
-        " FROM ka)")
-    # the argmin assignment has no frequency/length inversion
-    inv = " + ".join(
-        f"(CASE WHEN f{i}.f > f{j}.f AND k.l{i} > k.l{j}"
-        f" THEN 1 ELSE 0 END)"
-        for i in range(6) for j in range(6) if i != j)
-    parts.append(
-        f"iv AS (SELECT CAST(sum({inv}) AS BIGINT)"
-        f" AS inversion_viol\n"
-        f"         FROM ka k CROSS JOIN ex e\n"
-        f"         {fj}\n"
-        f"         WHERE k.cost = e.exh_opt)")
-    parts.append(
-        f"ndc AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT h.i, h.f, h.len,\n"
-        f"       c.huff_cost, x.exh_opt,\n"
-        f"       c.huff_cost - x.exh_opt AS opt_resid,\n"
-        f"       c.kraft64, c.kraft64 - 64 AS kraft_resid,\n"
-        f"       x.n_kraft, c.fixed_cost,\n"
-        f"       c.fixed_cost - c.huff_cost AS savings,\n"
-        f"       v.inversion_viol, l.n_docs\n"
-        f"FROM hl h CROSS JOIN hc c CROSS JOIN ex x\n"
-        f"CROSS JOIN iv v CROSS JOIN ndc l")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q628_huffman_optimality",
-       "WITH " + _q628_sql("documents", "//", " MATERIALIZED"))
-def q628(spark, sf_dir):
-    """Huffman coding with optimality verified against the ENTIRE
-    Kraft space (Huffman 1952; the prefix-code construction
-    under every entropy coder, with the theorem checked rather
-    than trusted).  Symbols are six geometric doc-id shard
-    classes of the real corpus (frequencies ~256/128/64/31/14/7
-    per 500 — genuinely skewed, so the optimal tree is the
-    maximally lopsided (1,2,3,4,5,5) profile, not the balanced
-    tree near-uniform sources hide behind).  The greedy runs as
-    five relational merge rounds — two packed argmins pick the
-    lightest pair, a membership MASK rides each node so codeword
-    lengths fall out as 'number of merges my mask joined'
-    (sum of mask bits over the merge log, no tree walk).  The
-    certificate space is every length assignment satisfying
-    Kraft EXACTLY: all 6^6 length vectors filter to
-    n_kraft == 525 valid prefix-code profiles (Kraft sum as an
-    integer CASE sum == 64 — McMillan's converse makes these
-    exactly the decodable codes), and opt_resid == 0 proves the
-    greedy's cost 933 is THE minimum over all 525 — Huffman's
-    theorem by exhaustion.  kraft_resid == 0 confirms the greedy
-    output itself is tight; inversion_viol == 0 verifies the
-    rearrangement property on the exhaustive argmin (no
-    more-frequent symbol gets a strictly longer code); savings
-    against the 3-bit fixed-length code (1500 -> 933) is the
-    point of the whole exercise, measured.  Scale: frequency
-    extraction is one corpus aggregation; everything else is
-    dim-sized — the audit a codec build step should run."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q628_documents")
-    # the merge chain has 4 references per stage — pin each round
-    # (4^5 Catalyst subtrees each re-scanning the corpus otherwise)
-    sql = _q628_sql("q628_documents", "div", "")
-    cts = {}
-    rest = sql
-    # split the generated CTE list back into named fragments
-    import re as _re
-    names = _re.findall(r"(\w+) AS \(", sql)
-    frags = {}
-    for nm in ["fr", "h0"] + [f"{p}{r}" for r in range(1, 6)
-                              for p in ("pa", "pb", "mg", "h")]:
-        start = sql.index(f"{nm} AS (")
-        depth = 0
-        i = sql.index("(", start)
-        j = i
-        while True:
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        frags[nm] = sql[i + 1:j]
-    pin = lambda nm, body: _pin_view(spark, body, f"q628_{nm}")
-    pin("fr", frags["fr"])
-    pin("h0", frags["h0"].replace("FROM fr", "FROM q628_fr"))
-    for r in range(1, 6):
-        pin(f"pa{r}", frags[f"pa{r}"]
-            .replace(f"FROM h{r - 1}", f"FROM q628_h{r - 1}"))
-        pin(f"pb{r}", frags[f"pb{r}"]
-            .replace(f"FROM h{r - 1} h", f"FROM q628_h{r - 1} h")
-            .replace(f"CROSS JOIN pa{r}",
-                     f"CROSS JOIN q628_pa{r}"))
-        pin(f"mg{r}", frags[f"mg{r}"]
-            .replace(f"FROM h{r - 1} h", f"FROM q628_h{r - 1} h")
-            .replace(f"CROSS JOIN pa{r}", f"CROSS JOIN q628_pa{r}")
-            .replace(f"CROSS JOIN pb{r}",
-                     f"CROSS JOIN q628_pb{r}"))
-        pin(f"h{r}", frags[f"h{r}"]
-            .replace(f"FROM h{r - 1} h", f"FROM q628_h{r - 1} h")
-            .replace(f"CROSS JOIN pa{r}", f"CROSS JOIN q628_pa{r}")
-            .replace(f"CROSS JOIN pb{r}", f"CROSS JOIN q628_pb{r}")
-            .replace(f"FROM mg{r}", f"FROM q628_mg{r}"))
-    # final SQL: drop the pinned CTE definitions, rewire names
-    tail_start = sql.index("mgu AS (")
-    fin = sql[tail_start:]
-    for r in range(1, 6):
-        fin = fin.replace(f"FROM mg{r}", f"FROM q628_mg{r}")
-    fin = _re.sub(r"\bfr\b", "q628_fr", fin)
-    fin = fin.replace("q628_q628_fr", "q628_fr")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q629: seven queens — exhaustive CSP + dihedral orbit structure
-
-
-def _q629_sql(tbl: str, d: str, mat: str) -> str:
-    joins = " CROSS JOIN ".join(f"cd c{r}" for r in range(7))
-    cols = ", ".join(f"c{r}.x AS q{r}" for r in range(7))
-    safe = " AND ".join(
-        f"c{i}.x <> c{j}.x AND abs(c{i}.x - c{j}.x) <> {j - i}"
-        for i in range(7) for j in range(i + 1, 7))
-    pack = lambda p: " + ".join(f"{p}{r}*{7 ** (6 - r)}"
-                                for r in range(7))
-    # the 8 dihedral images of a placement (as a permutation
-    # r -> q_r): h = mirror columns, v = reverse rows, and the
-    # inverse permutation t (transpose); group = <h, v, t>
-    def inv(p, k):
-        return " + ".join(
-            f"{r}*(CASE WHEN {p}{r} = {k} THEN 1 ELSE 0 END)"
-            for r in range(7))
-    variants = []
-    # e, h, v, hv on the direct permutation
-    variants.append(" + ".join(f"s.q{r}*{7 ** (6 - r)}"
-                               for r in range(7)))
-    variants.append(" + ".join(f"(6 - s.q{r})*{7 ** (6 - r)}"
-                               for r in range(7)))
-    variants.append(" + ".join(f"s.q{6 - r}*{7 ** (6 - r)}"
-                               for r in range(7)))
-    variants.append(" + ".join(f"(6 - s.q{6 - r})*{7 ** (6 - r)}"
-                               for r in range(7)))
-    # e, h, v, hv on the inverse permutation (transpose family)
-    for mode in range(4):
-        terms = []
-        for r in range(7):
-            k = r if mode in (0, 1) else 6 - r
-            base = f"({inv('s.q', k)})"
-            if mode in (1, 3):
-                base = f"(6 - {base})"
-            terms.append(f"{base}*{7 ** (6 - r)}")
-        variants.append(" + ".join(terms))
-    vle = "least(" + ", ".join(variants) + ")"
-    vun = "\n         UNION ALL ".join(
-        f"SELECT s.pk, {v} AS img FROM sol s"
-        for v in variants)
-    return (
-        f"cd AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       sol AS{mat} (SELECT {cols}\n"
-        f"         FROM {joins} WHERE {safe}),\n"
-        f"       sol2 AS{mat} (SELECT q0, q1, q2, q3, q4, q5,"
-        f" q6,\n"
-        f"           {pack('q')} AS pk FROM sol),\n"
-        f"       ns AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_solutions,\n"
-        f"           CAST(count(DISTINCT pk) AS BIGINT)"
-        f" AS n_distinct FROM sol2),\n"
-        f"       cn AS{mat} (SELECT s.pk, {vle} AS canon\n"
-        f"         FROM sol2 s),\n"
-        f"       nc AS (SELECT CAST(count(DISTINCT canon)"
-        f" AS BIGINT) AS n_classes FROM cn),\n"
-        # group action closure: every image is itself a solution
-        f"       im AS{mat} ({vun.replace('FROM sol s', 'FROM sol2 s')}),\n"
-        f"       cl AS (SELECT CAST(sum(CASE WHEN t.pk IS NULL\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS closure_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_images\n"
-        f"         FROM im LEFT JOIN sol2 t ON t.pk = im.img),\n"
-        # orbit sizes divide the group order 8
-        f"       ob AS{mat} (SELECT canon,"
-        f" CAST(count(*) AS BIGINT) AS sz\n"
-        f"         FROM cn GROUP BY canon),\n"
-        f"       ov AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN 8 % sz <> 0 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS orbit_viol,\n"
-        f"           CAST(sum(sz) AS BIGINT) AS orbit_sum,\n"
-        f"           CAST(max(sz) AS BIGINT) AS max_orbit,\n"
-        f"           CAST(min(sz) AS BIGINT) AS min_orbit\n"
-        f"         FROM ob),\n"
-        # independent attack re-check through a pair dim
-        f"       pr AS (SELECT a.x AS i, b.x AS j FROM cd a\n"
-        f"         JOIN cd b ON b.x > a.x),\n"
-        f"       av AS (SELECT CAST(sum(CASE WHEN\n"
-        + "".join(
-            f"           (p.i = {i} AND p.j = {j}) AND\n"
-            f"             (s.q{i} = s.q{j} OR abs(s.q{i} -"
-            f" s.q{j}) = {j - i}) OR\n"
-            for i in range(7) for j in range(i + 1, 7)).rstrip(
-                " OR\n") + "\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS attack_viol\n"
-        f"         FROM sol2 s CROSS JOIN pr p),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT o.canon, o.sz,\n"
-        f"       n.n_solutions, n.n_distinct, c.n_classes,\n"
-        f"       l2.closure_viol, l2.n_images,\n"
-        f"       v.orbit_viol, v.orbit_sum, v.max_orbit,"
-        f" v.min_orbit,\n"
-        f"       a.attack_viol, d2.n_docs\n"
-        f"FROM ob o CROSS JOIN ns n CROSS JOIN nc c\n"
-        f"CROSS JOIN cl l2 CROSS JOIN ov v CROSS JOIN av a\n"
-        f"CROSS JOIN ld d2")
-
-
-@query("q629_seven_queens",
-       "WITH " + _q629_sql("documents", "//", " MATERIALIZED"))
-def q629(spark, sf_dir):
-    """Seven queens by total exhaustion, with the dihedral orbit
-    structure computed and the group action verified (the
-    n-queens constraint problem, Gauss 1850; the orbit census is
-    the Burnside story of q613 acting on SOLUTIONS instead of
-    strings).  All 7^7 = 823543 placements materialize from the
-    doc-residue column dim; the 21 pairwise no-attack conditions
-    (same column, same diagonal) filter them to exactly
-    n_solutions == 40 — the known count, from brute force, with
-    attack_viol == 0 re-checking every survivor through an
-    INDEPENDENT pair-dim formulation rather than trusting the
-    filter.  Because solutions are permutations, the full
-    dihedral group D4 of the board acts through three generators
-    — column mirror, row reversal, and permutation INVERSE (the
-    transpose, computed per position as a sum of indicator
-    terms) — and: closure_viol == 0 over all 320 images proves
-    every symmetry image of a solution is again a solution (the
-    group action is well-defined on the solution set, checked
-    image by image); canonicalization (least of the 8 variants)
-    yields n_classes == 6 fundamental solutions; orbit sizes
-    {8,8,8,8,4,4} sum back to 40 (orbit_sum) and every size
-    divides the group order (orbit_viol == 0 — orbit-stabilizer
-    as a data check; the two size-4 orbits are the
-    180-degree-self-symmetric solutions).  Scale: the sweep is
-    one generated cross join + vectorized predicates —
-    embarrassingly parallel CSP, the shape of exhaustive
-    config-space audits."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q629_documents")
-    return spark.sql(
-        "WITH " + _q629_sql("q629_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q630: Ramsey R(3,3) = 6 — both directions by total exhaustion
-
-
-_Q630_T6 = [(1, 2, 32), (1, 4, 64), (1, 8, 128), (1, 16, 256),
-            (2, 4, 512), (2, 8, 1024), (2, 16, 2048),
-            (4, 8, 4096), (4, 16, 8192), (8, 16, 16384),
-            (32, 64, 512), (32, 128, 1024), (32, 256, 2048),
-            (64, 128, 4096), (64, 256, 8192), (128, 256, 16384),
-            (512, 1024, 4096), (512, 2048, 8192),
-            (1024, 2048, 16384), (4096, 8192, 16384)]
-_Q630_T5 = [(1, 2, 16), (1, 4, 32), (1, 8, 64), (2, 4, 128),
-            (2, 8, 256), (4, 8, 512), (16, 32, 128),
-            (16, 64, 256), (32, 64, 512), (128, 256, 512)]
-_Q630_D5 = [[1, 2, 4, 8], [1, 16, 32, 64], [2, 16, 128, 256],
-            [4, 32, 128, 512], [8, 64, 256, 512]]
-
-
-def _q630_sql(tbl: str, d: str, mat: str) -> str:
-    t6 = ", ".join(f"({a}, {b}, {c})" for a, b, c in _Q630_T6)
-    t5 = ", ".join(f"({a}, {b}, {c})" for a, b, c in _Q630_T5)
-    j15 = " CROSS JOIN ".join(f"bd b{i}" for i in range(15))
-    m15 = " + ".join(f"b{i}.x*{1 << i}" for i in range(15))
-    j10 = " CROSS JOIN ".join(f"bd b{i}" for i in range(10))
-    m10 = " + ".join(f"b{i}.x*{1 << i}" for i in range(10))
-    degs = ",\n           ".join(
-        f"CAST({' + '.join(f'(s.m {{d}} {w}) % 2' for w in ws)}"
-        f" AS BIGINT) AS dg{v}"
-        for v, ws in enumerate(_Q630_D5)).format(d=d)
-    return (
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       t6 AS (SELECT CAST(a AS BIGINT) AS a, CAST(b"
-        f" AS BIGINT) AS b,\n"
-        f"           CAST(c AS BIGINT) AS c\n"
-        f"         FROM (VALUES {t6}) t(a, b, c)),\n"
-        f"       t5 AS (SELECT CAST(a AS BIGINT) AS a, CAST(b"
-        f" AS BIGINT) AS b,\n"
-        f"           CAST(c AS BIGINT) AS c\n"
-        f"         FROM (VALUES {t5}) t(a, b, c)),\n"
-        f"       k6 AS{mat} (SELECT {m15} AS m FROM {j15}),\n"
-        f"       k5 AS{mat} (SELECT {m10} AS m FROM {j10}),\n"
-        # a coloring is Ramsey-free iff NO triangle is mono
-        f"       r6 AS{mat} (SELECT k.m,\n"
-        f"           CAST(max(CASE WHEN (k.m {d} t.a) % 2 =\n"
-        f"             (k.m {d} t.b) % 2 AND (k.m {d} t.b) % 2 =\n"
-        f"             (k.m {d} t.c) % 2 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS has_mono\n"
-        f"         FROM k6 k CROSS JOIN t6 t GROUP BY k.m),\n"
-        f"       r5 AS{mat} (SELECT k.m,\n"
-        f"           CAST(max(CASE WHEN (k.m {d} t.a) % 2 =\n"
-        f"             (k.m {d} t.b) % 2 AND (k.m {d} t.b) % 2 =\n"
-        f"             (k.m {d} t.c) % 2 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS has_mono\n"
-        f"         FROM k5 k CROSS JOIN t5 t GROUP BY k.m),\n"
-        f"       c6 AS (SELECT\n"
-        f"           CAST(sum(1 - has_mono) AS BIGINT)"
-        f" AS k6_free,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_k6"
-        f" FROM r6),\n"
-        f"       c5 AS (SELECT\n"
-        f"           CAST(sum(1 - has_mono) AS BIGINT)"
-        f" AS k5_free,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_k5"
-        f" FROM r5),\n"
-        # the 12 survivors: each color class is 2-regular (two
-        # disjoint 5-cycles — the pentagon/pentagram witness)
-        f"       sv AS{mat} (SELECT s.m, {degs}\n"
-        f"         FROM r5 s WHERE s.has_mono = 0),\n"
-        f"       rg AS (SELECT CAST(sum(CASE WHEN dg0 <> 2 OR"
-        f" dg1 <> 2\n"
-        f"           OR dg2 <> 2 OR dg3 <> 2 OR dg4 <> 2 THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS reg_viol\n"
-        f"         FROM sv),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT s.m, s.dg0, s.dg1, s.dg2, s.dg3, s.dg4,\n"
-        f"       x6.k6_free, x6.n_k6, x5.k5_free, x5.n_k5,\n"
-        f"       r.reg_viol, l.n_docs\n"
-        f"FROM sv s CROSS JOIN c6 x6 CROSS JOIN c5 x5\n"
-        f"CROSS JOIN rg r CROSS JOIN ld l")
-
-
-@query("q630_ramsey_r33",
-       "WITH " + _q630_sql("documents", "//", " MATERIALIZED"))
-def q630(spark, sf_dir):
-    """R(3,3) = 6, both directions proven by total exhaustion
-    (Ramsey 1930; the party-of-six theorem — the smallest
-    nontrivial Ramsey number, and the template for 'disorder is
-    impossible at scale' arguments).  The UPPER bound: all 2^15
-    two-colorings of K6's edges materialize from the doc-parity
-    dim, each checked against the 20-triangle dim (edge colors
-    extracted by div/mod against precomputed bit weights), and
-    k6_free == 0 — not one coloring of K6 avoids a monochromatic
-    triangle, all 32768 cases inspected.  The LOWER bound: the
-    same machinery on K5's 2^10 colorings finds k5_free == 12
-    survivors — R(3,3) > 5 witnessed by actual colorings, and 12
-    is itself the known census (the pentagon/pentagram
-    colorings, one per oriented 5-cycle).  The survivors'
-    structure is then verified, not admired: reg_viol == 0
-    checks each survivor's color-0 graph is exactly 2-REGULAR at
-    every vertex (degree from bit weights), which forces a
-    disjoint union of cycles, and triangle-freeness of both
-    classes forces the unique 5-cycle/pentagram split — the
-    classical characterization, emitted with per-vertex degrees
-    on all 12 rows.  Scale: the sweep is a generated cross join
-    with a broadcast triangle dim — certification by exhaustion
-    in one shuffle-free pass."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q630_documents")
-    return spark.sql(
-        "WITH " + _q630_sql("q630_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q631: derangements — three machines + the rencontres distribution
-
-
-def _q631_sql(tbl: str, d: str, mat: str) -> str:
-    parts = [
-        f"sd AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS s FROM {tbl})",
-        f"pw AS (SELECT CAST(j AS BIGINT) AS j, CAST(p AS"
-        f" BIGINT) AS p\n"
-        f"         FROM (VALUES " + ", ".join(
-            f"({j}, {1 << j})" for j in range(7)) + ") t(j, p))",
-        "e0 AS (SELECT CAST(0 AS BIGINT) AS vis, CAST(0 AS"
-        " BIGINT) AS fx\n"
-        "         FROM sd WHERE s = 0)",
-    ]
-    for k in range(1, 8):
-        parts.append(
-            f"e{k} AS (SELECT e.vis + b.p AS vis,\n"
-            f"           e.fx + CASE WHEN c.s = {k - 1} THEN 1"
-            f" ELSE 0 END AS fx\n"
-            f"         FROM e{k - 1} e JOIN sd c ON true\n"
-            f"         JOIN pw b ON b.j = c.s\n"
-            f"         WHERE (e.vis {d} b.p) % 2 = 0)")
-    parts.append(
-        f"rc AS{mat} (SELECT fx AS k, CAST(count(*) AS BIGINT)"
-        f" AS cnt FROM e7 GROUP BY fx)")
-    # derangement recurrence D(n) = (n-1)(D(n-1) + D(n-2))
-    parts.append("d0 AS (SELECT CAST(1 AS BIGINT) AS dp,"
-                 " CAST(0 AS BIGINT) AS dc)")
-    for n in range(2, 8):
-        parts.append(
-            f"d{n - 1} AS (SELECT dc AS dp,"
-            f" {n - 1}*(dc + dp) AS dc FROM d{n - 2})")
-    # inclusion-exclusion: D(7) = sum (-1)^k 7!/k!
-    parts.append("fc0 AS (SELECT CAST(1 AS BIGINT) AS f)")
-    for k in range(1, 8):
-        parts.append(f"fc{k} AS (SELECT f*{k} AS f FROM"
-                     f" fc{k - 1})")
-    parts.append(
-        f"die AS (SELECT\n"
-        f"           CAST(a7.f {d} b0.f - a7.f {d} b1.f\n"
-        f"             + a7.f {d} b2.f - a7.f {d} b3.f\n"
-        f"             + a7.f {d} b4.f - a7.f {d} b5.f\n"
-        f"             + a7.f {d} b6.f - a7.f {d} b7.f"
-        f" AS BIGINT) AS d_ie\n"
-        f"         FROM fc7 a7 CROSS JOIN fc0 b0 CROSS JOIN fc1"
-        f" b1\n"
-        f"         CROSS JOIN fc2 b2 CROSS JOIN fc3 b3\n"
-        f"         CROSS JOIN fc4 b4 CROSS JOIN fc5 b5\n"
-        f"         CROSS JOIN fc6 b6 CROSS JOIN fc7 b7)")
-    # rencontres prediction C(7,k) * D(7-k): D table by unroll
-    dts = []
-    D = [1, 0, 1, 2, 9, 44, 265, 1854]
-    # (the prediction joins the RECURRENCE chain, not literals —
-    #  dtab collects D(0..7) from the staged recurrence)
-    parts.append(
-        "dtab AS (SELECT CAST(0 AS BIGINT) AS n, dp AS v"
-        " FROM d0\n"
-        "         UNION ALL SELECT 1, dc FROM d0\n"
-        + "".join(f"         UNION ALL SELECT {n}, dc FROM"
-                  f" d{n - 1}\n" for n in range(2, 8)) + ")")
-    binom = ", ".join(f"({k}, {__import__('math').comb(7, k)})"
-                      for k in range(8))
-    parts.append(
-        f"bi AS (SELECT CAST(k AS BIGINT) AS k, CAST(c AS"
-        f" BIGINT) AS c FROM (VALUES {binom}) t(k, c))")
-    parts.append(
-        f"prd AS{mat} (SELECT b.k, b.c*t.v AS pred\n"
-        f"         FROM bi b JOIN dtab t ON t.n = 7 - b.k)")
-    parts.append(
-        f"vf AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN coalesce(r.cnt, 0) <>"
-        f" p.pred\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS rencontres_viol,\n"
-        f"           CAST(sum(p.pred) AS BIGINT) AS pred_sum\n"
-        f"         FROM prd p LEFT JOIN rc r ON r.k = p.k)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT p.k, coalesce(r.cnt, 0) AS observed, p.pred,\n"
-        f"       t.v AS d7_rec, i.d_ie, t.v - i.d_ie"
-        f" AS rec_ie_resid,\n"
-        f"       v.rencontres_viol, v.pred_sum,\n"
-        f"       v.pred_sum - 5040 AS total_resid, l.n_docs\n"
-        f"FROM prd p LEFT JOIN rc r ON r.k = p.k\n"
-        f"CROSS JOIN (SELECT v FROM dtab WHERE n = 7) t\n"
-        f"CROSS JOIN die i CROSS JOIN vf v CROSS JOIN ld l")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q631_derangements",
-       "WITH " + _q631_sql("documents", "//", " MATERIALIZED"))
-def q631(spark, sf_dir):
-    """Derangements and the full rencontres distribution — three
-    machines and an exhaustive census in agreement (Montmort
-    1708, Euler 1753; the fixed-point statistics behind shuffle
-    tests and hash-permutation audits).  All 5040 permutations
-    of 7 elements enumerate by prefix extension (visited set
-    packed in powers of two), counting fixed points EN ROUTE
-    (digit == position), and the observed distribution of
-    'exactly k fixed points' is checked against the rencontres
-    formula C(7,k) x D(7-k) for EVERY k (rencontres_viol == 0)
-    — including k == 6, where both sides are 0: you cannot fix
-    exactly six of seven, and the census knows it.  D itself is
-    computed twice more, sharing nothing: Euler's recurrence
-    D(n) = (n-1)(D(n-1) + D(n-2)) as staged single-row algebra,
-    and the inclusion-exclusion alternating sum 7! sum (-1)^k/k!
-    via a factorial chain with EXACT integer divisions
-    (rec_ie_resid == 0 ties them; tying to q625's IE machinery
-    — a derangement count IS an inclusion-exclusion over fixed
-    sets).  pred_sum == 5040 closes the loop: the predicted
-    distribution is a genuine partition of the symmetric group.
-    Scale: the enumeration is the q600 prefix-extension shape;
-    the distribution check is one grouped aggregation — the
-    audit you run on any claimed uniform shuffle."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q631_documents")
-    return spark.sql(
-        "WITH " + _q631_sql("q631_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q632: tic-tac-toe solved — retrograde minimax over all states
-
-
-_Q632_LINES = [(0, 1, 2), (3, 4, 5), (6, 7, 8), (0, 3, 6),
-               (1, 4, 7), (2, 5, 8), (0, 4, 8), (2, 4, 6)]
-
-
-def _q632_base(tbl: str) -> str:
-    joins = " CROSS JOIN ".join(f"td t{i}" for i in range(9))
-    cols = ", ".join(f"t{i}.x AS d{i}" for i in range(9))
-    pack = " + ".join(f"t{i}.x*{3 ** i}" for i in range(9))
-    cx = " + ".join(f"CASE WHEN d{i} = 1 THEN 1 ELSE 0 END"
-                    for i in range(9))
-    co = " + ".join(f"CASE WHEN d{i} = 2 THEN 1 ELSE 0 END"
-                    for i in range(9))
-    def win(p):
-        return "CASE WHEN " + " OR ".join(
-            f"(d{a} = {p} AND d{b} = {p} AND d{c} = {p})"
-            for a, b, c in _Q632_LINES) + " THEN 1 ELSE 0 END"
-    return (
-        f"td AS (SELECT DISTINCT CAST(doc_id % 3 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       st AS (SELECT {cols}, {pack} AS s"
-        f" FROM {joins}),\n"
-        f"       lg AS (SELECT s, d0, d1, d2, d3, d4, d5, d6,"
-        f" d7, d8,\n"
-        f"           cx, co, wx, wo,\n"
-        f"           CASE WHEN cx = co THEN 1 ELSE 2 END"
-        f" AS turn,\n"
-        f"           CASE WHEN wx = 1 OR wo = 1 OR cx + co = 9\n"
-        f"             THEN 1 ELSE 0 END AS isterm,\n"
-        f"           CAST(CASE WHEN wx = 1 THEN 1 WHEN wo = 1"
-        f" THEN -1\n"
-        f"             ELSE 0 END AS BIGINT) AS tval\n"
-        f"         FROM (SELECT *, {cx} AS cx, {co} AS co,\n"
-        f"             {win(1)} AS wx, {win(2)} AS wo"
-        f" FROM st) u\n"
-        f"         WHERE (cx = co OR cx = co + 1)\n"
-        f"           AND NOT (wx = 1 AND wo = 1)\n"
-        f"           AND NOT (wx = 1 AND cx <> co + 1)\n"
-        f"           AND NOT (wo = 1 AND cx <> co))")
-
-
-def _q632_stage(m: int, prev: str, lg: str, cd: str) -> str:
-    """Retrograde step: values for m-piece nonterminal states."""
-    return (
-        f"SELECT s, v FROM {prev}\n"
-        f"UNION ALL\n"
-        f"SELECT g.s,\n"
-        f"  CAST(CASE WHEN g.turn = 1 THEN max(v.v)"
-        f" ELSE min(v.v) END AS BIGINT) AS v\n"
-        f"FROM {lg} g JOIN {cd} c ON\n"
-        f"  CASE c.cell WHEN 0 THEN g.d0 WHEN 1 THEN g.d1\n"
-        f"    WHEN 2 THEN g.d2 WHEN 3 THEN g.d3 WHEN 4 THEN"
-        f" g.d4\n"
-        f"    WHEN 5 THEN g.d5 WHEN 6 THEN g.d6 WHEN 7 THEN"
-        f" g.d7\n"
-        f"    ELSE g.d8 END = 0\n"
-        f"JOIN {prev} v ON v.s = g.s + g.turn*c.p3\n"
-        f"WHERE g.cx + g.co = {m} AND g.isterm = 0\n"
-        f"GROUP BY g.s, g.turn")
-
-
-def _q632_final(va: str, lg: str, cd: str, tbl: str,
-                mat: str) -> str:
-    return (
-        f"aud AS (SELECT CAST(sum(CASE WHEN v0.v <> t.want"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT)"
-        f" AS consistency_viol FROM (\n"
-        f"           SELECT g.s,\n"
-        f"             CAST(CASE WHEN g.turn = 1 THEN max(v.v)\n"
-        f"               ELSE min(v.v) END AS BIGINT) AS want\n"
-        f"           FROM {lg} g JOIN {cd} c ON\n"
-        f"             CASE c.cell WHEN 0 THEN g.d0 WHEN 1 THEN"
-        f" g.d1\n"
-        f"               WHEN 2 THEN g.d2 WHEN 3 THEN g.d3\n"
-        f"               WHEN 4 THEN g.d4 WHEN 5 THEN g.d5\n"
-        f"               WHEN 6 THEN g.d6 WHEN 7 THEN g.d7\n"
-        f"               ELSE g.d8 END = 0\n"
-        f"           JOIN {va} v ON v.s = g.s + g.turn*c.p3\n"
-        f"           WHERE g.isterm = 0 GROUP BY g.s, g.turn)"
-        f" t\n"
-        f"         JOIN {va} v0 ON v0.s = t.s),\n"
-        f"       cnt AS (SELECT\n"
-        f"           CAST(count(*) AS BIGINT) AS n_legal,\n"
-        f"           CAST(sum(isterm) AS BIGINT) AS n_terminal,\n"
-        f"           CAST(sum(CASE WHEN wx = 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_xwins,\n"
-        f"           CAST(sum(CASE WHEN wo = 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_owins,\n"
-        f"           CAST(sum(CASE WHEN isterm = 1 AND wx = 0"
-        f" AND wo = 0\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_draws\n"
-        f"         FROM {lg}),\n"
-        f"       ev AS (SELECT CAST(v AS BIGINT)"
-        f" AS value_empty FROM {va} WHERE s = 0),\n"
-        f"       pm AS{mat} (SELECT g.cx + g.co AS m,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_states,\n"
-        f"           CAST(sum(CASE WHEN v.v = 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_xval,\n"
-        f"           CAST(sum(CASE WHEN v.v = -1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_oval,\n"
-        f"           CAST(sum(CASE WHEN v.v = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_draw_val\n"
-        f"         FROM {lg} g JOIN {va} v ON v.s = g.s\n"
-        f"         GROUP BY g.cx + g.co),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT p.m, p.n_states, p.n_xval, p.n_oval,"
-        f" p.n_draw_val,\n"
-        f"       c.n_legal, c.n_terminal, c.n_xwins, c.n_owins,\n"
-        f"       c.n_draws, e.value_empty, a.consistency_viol,\n"
-        f"       l.n_docs\n"
-        f"FROM pm p CROSS JOIN cnt c CROSS JOIN ev e\n"
-        f"CROSS JOIN aud a CROSS JOIN ld l")
-
-
-def _q632_oracle(tbl: str = "documents") -> str:
-    cd = ", ".join(f"({c}, {3 ** c})" for c in range(9))
-    parts = [_q632_base(tbl)]
-    parts.append(f"cd AS (SELECT CAST(cell AS BIGINT) AS cell,"
-                 f" CAST(p3 AS BIGINT) AS p3\n"
-                 f"         FROM (VALUES {cd}) t(cell, p3))")
-    parts.append(
-        "va9 AS MATERIALIZED (SELECT s, tval AS v FROM lg"
-        " WHERE isterm = 1)")
-    prev = "va9"
-    for m in range(8, -1, -1):
-        parts.append(f"va{m} AS MATERIALIZED"
-                     f" ({_q632_stage(m, prev, 'lg', 'cd')})")
-        prev = f"va{m}"
-    parts.append(_q632_final(prev, "lg", "cd", tbl,
-                             " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q632_tictactoe_solved", _q632_oracle())
-def q632(spark, sf_dir):
-    """Tic-tac-toe SOLVED — retrograde minimax over the entire
-    state space, with the solution audited state by state
-    (Zermelo 1913's theorem made concrete on the smallest
-    nontrivial game; the retrograde pattern is how endgame
-    tablebases are actually built).  All 3^9 boards materialize
-    from the doc-residue trit dim; legality is pure expression
-    work (move-count balance, no double win, winner-moved-last),
-    yielding the classical census n_legal == 5478 with
-    n_terminal == 958 splitting 626/316/16 into X wins, O wins,
-    and full-board draws.  Values then propagate BACKWARD
-    through nine wavefront stages — stage m values every
-    nonterminal m-piece state as max (X to move) or min (O to
-    move) over its children, children reached by one cell-dim
-    join (child = s + turn * 3^cell on an empty digit) against
-    the previous stage's accumulated table.  The headline:
-    value_empty == 0 — perfect play draws, the theorem everyone
-    knows, here COMPUTED from nothing but the rules.  The audit
-    is total: consistency_viol == 0 re-derives every nonterminal
-    state's value from its children's final values in one
-    independent join — 4520 Bellman equations checked
-    simultaneously, so the staged propagation cannot have
-    smuggled an error through ordering.  Per-depth value counts
-    are emitted (the game tree's shape by ply).  Scale:
-    retrograde analysis IS the shuffle-per-ply pattern — stage
-    tables are depth slices, children one equi-join away."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q632_documents")
-    base = _q632_base("q632_documents")
-    cd = ", ".join(f"({c}, {3 ** c})" for c in range(9))
-    _pin_view(spark,
-              f"SELECT CAST(cell AS BIGINT) AS cell,"
-              f" CAST(p3 AS BIGINT) AS p3\n"
-              f"FROM (VALUES {cd}) t(cell, p3)", "q632_cd")
-    _ckpt_view(spark,
-               "WITH " + base + "\nSELECT * FROM lg", "q632_lg")
-    _pin_view(spark,
-              "SELECT s, tval AS v FROM q632_lg WHERE"
-              " isterm = 1", "q632_va9", max_rows=1200)
-    prev = "q632_va9"
-    for m in range(8, -1, -1):
-        _pin_view(spark,
-                  _q632_stage(m, prev, "q632_lg", "q632_cd"),
-                  f"q632_va{m}", max_rows=6000)
-        prev = f"q632_va{m}"
-    fin = _q632_final(prev, "q632_lg", "q632_cd",
-                      "q632_documents", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q633: Wythoff's game — kernel axioms + Beatty's partition theorem
-
-
-def _q633_sql(tbl: str, d: str, mat: str) -> str:
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 41 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       n26 AS (SELECT x AS n FROM nd WHERE x <= 25),\n"
-        f"       kd AS (SELECT x AS k FROM nd WHERE x <= 56\n"
-        f"         UNION SELECT x + 41 FROM nd"
-        f" WHERE x + 41 <= 56),\n"
-        # floor(n*phi) = (n + isqrt(5 n^2)) div 2, isqrt by dim
-        f"       bt AS{mat} (SELECT n.n,\n"
-        f"           (n.n + max(k.k)) {d} 2 AS a,\n"
-        f"           (n.n + max(k.k)) {d} 2 + n.n AS b\n"
-        f"         FROM n26 n JOIN kd k"
-        f" ON k.k*k.k <= 5*n.n*n.n\n"
-        f"         GROUP BY n.n),\n"
-        f"       cold AS{mat} (SELECT a, b FROM bt"
-        f" WHERE b <= 40),\n"
-        f"       pos AS{mat} (SELECT a.x AS a, b.x AS b\n"
-        f"         FROM nd a JOIN nd b ON a.x <= b.x),\n"
-        # a legal Wythoff move between NORMALIZED positions
-        f"       mv AS{mat} (SELECT p.a, p.b, c.a AS ca,"
-        f" c.b AS cb\n"
-        f"         FROM pos p JOIN cold c ON\n"
-        f"           (c.b = p.b AND c.a < p.a) OR\n"
-        f"           (c.a = p.a AND c.b < p.b) OR\n"
-        f"           (c.b = p.a AND c.a < p.a) OR\n"
-        f"           (c.b - c.a = p.b - p.a AND c.a < p.a)),\n"
-        # kernel axiom 1: no cold position moves to a cold one
-        f"       ax1 AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS internal_viol\n"
-        f"         FROM mv m JOIN cold c2\n"
-        f"           ON c2.a = m.a AND c2.b = m.b),\n"
-        # kernel axiom 2: every hot position has a move to cold
-        f"       ax2 AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS external_viol\n"
-        f"         FROM pos p\n"
-        f"         LEFT JOIN cold c ON c.a = p.a AND c.b = p.b\n"
-        f"         LEFT JOIN (SELECT DISTINCT a, b FROM mv) m\n"
-        f"           ON m.a = p.a AND m.b = p.b\n"
-        f"         WHERE c.a IS NULL AND m.a IS NULL),\n"
-        # Beatty: the two sequences partition 1..40
-        f"       cov AS{mat} (SELECT g.x AS m,\n"
-        f"           CAST(sum(CASE WHEN t.a = g.x THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS in_a,\n"
-        f"           CAST(sum(CASE WHEN t.b = g.x THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS in_b\n"
-        f"         FROM nd g CROSS JOIN bt t\n"
-        f"         WHERE g.x >= 1 GROUP BY g.x),\n"
-        f"       pv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN in_a + in_b <> 1 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT)"
-        f" AS partition_viol,\n"
-        f"           CAST(sum(in_a) AS BIGINT) AS n_in_a,\n"
-        f"           CAST(sum(in_b) AS BIGINT) AS n_in_b\n"
-        f"         FROM cov),\n"
-        f"       zc AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS zero_cold FROM cold\n"
-        f"         WHERE a = 0 AND b = 0),\n"
-        f"       nc AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_cold FROM cold),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT c.a, c.b, c.b - c.a AS diff,\n"
-        f"       a1.internal_viol, a2.external_viol,\n"
-        f"       p.partition_viol, p.n_in_a, p.n_in_b,\n"
-        f"       z.zero_cold, n.n_cold, l.n_docs\n"
-        f"FROM cold c CROSS JOIN ax1 a1 CROSS JOIN ax2 a2\n"
-        f"CROSS JOIN pv p CROSS JOIN zc z CROSS JOIN nc n\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q633_wythoff_beatty",
-       "WITH " + _q633_sql("documents", "//", " MATERIALIZED"))
-def q633(spark, sf_dir):
-    """Wythoff's game and Beatty's theorem — the golden ratio as
-    a game-theoretic object, certified through the kernel axioms
-    rather than a DP (Wythoff 1907, Beatty 1926, Rayleigh 1894;
-    the two-pile subtraction game whose cold positions are
-    (floor(n*phi), floor(n*phi^2))).  The candidate cold set
-    computes EXACTLY from integer arithmetic: floor(n*phi) =
-    (n + isqrt(5n^2)) div 2 with isqrt as a max-k*k<=x dim join
-    — no floating golden ratio anywhere.  What certifies it is
-    the KERNEL-uniqueness theorem: a position set is THE
-    P-position set iff no member reaches another member in one
-    move (internal_viol == 0 over every cold-to-cold move
-    candidate, all three move types with pile-order
-    normalization) and every non-member reaches SOME member
-    (external_viol == 0 over all 861 normalized positions) —
-    the two stability axioms that pin the solution uniquely, so
-    verifying them by exhaustion IS solving the game, with no
-    81-stage wavefront needed.  Beatty's partition theorem rides
-    the same table: every integer in 1..40 lands in exactly one
-    of the two sequences (partition_viol == 0, the complementary-
-    sequences property that makes the closed form possible), and
-    the emitted cold pairs show diff == n marching upward — the
-    fingerprint of the phi spacing.  Scale: positions and dims
-    are bounded; the axiom checks are two joins — certifying a
-    closed form beats simulating a recurrence, at any scale."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q633_documents")
-    return spark.sql(
-        "WITH " + _q633_sql("q633_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q634: primes — Legendre's formula, Goldbach and Bertrand in range
-
-
-_Q634_SMALL = [2, 3, 5, 7, 11, 13, 17, 19, 23, 29, 31]
-
-
-def _q634_sql(tbl: str, d: str, mat: str) -> str:
-    sd = ", ".join(f"({p})" for p in _Q634_SMALL)
-    prod = "CAST(1 AS BIGINT)"
-    for i, p in enumerate(_Q634_SMALL):
-        prod = (f"({prod} * CASE WHEN (s.m {d} {1 << i}) % 2 = 1"
-                f" THEN {p} ELSE 1 END)")
-    bits = " + ".join(f"(s.m {d} {1 << i}) % 2"
-                      for i in range(11))
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 32 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       un AS{mat} (SELECT a.x*32 + b.x + 1 AS n\n"
-        f"         FROM nd a CROSS JOIN nd b\n"
-        f"         WHERE a.x*32 + b.x + 1 <= 1000),\n"
-        f"       sp AS (SELECT CAST(p AS BIGINT) AS p FROM\n"
-        f"           (VALUES {sd}) t(p)),\n"
-        f"       pr AS{mat} (SELECT u.n FROM un u\n"
-        f"         LEFT JOIN sp s ON u.n % s.p = 0"
-        f" AND u.n <> s.p\n"
-        f"         WHERE u.n >= 2 GROUP BY u.n\n"
-        f"         HAVING count(s.p) = 0),\n"
-        f"       pc AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS pi_direct FROM pr),\n"
-        # Legendre: phi(1000, 11) by IE over 2^11 prime subsets
-        f"       ms AS (SELECT t.x*1024 + a.x*32 + b.x AS m\n"
-        f"         FROM nd a CROSS JOIN nd b\n"
-        f"         CROSS JOIN (SELECT x FROM nd WHERE x < 2) t),\n"
-        f"       lg AS (SELECT CAST(sum(\n"
-        f"           CASE WHEN ({bits}) % 2 = 0 THEN 1 ELSE -1"
-        f" END\n"
-        f"           * (1000 {d} {prod})) AS BIGINT) AS phi_na\n"
-        f"         FROM ms s),\n"
-        # Goldbach for every even 4..1000
-        f"       gb AS{mat} (SELECT e.n,\n"
-        f"           CAST(count(*) AS BIGINT) AS reps\n"
-        f"         FROM (SELECT n FROM un WHERE n % 2 = 0"
-        f" AND n >= 4) e\n"
-        f"         LEFT JOIN pr p ON p.n <= e.n {d} 2\n"
-        f"         LEFT JOIN pr q ON q.n = e.n - p.n\n"
-        f"         GROUP BY e.n),\n"
-        f"       gv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN reps = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS goldbach_fail,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_even,\n"
-        f"           CAST(min(reps) AS BIGINT) AS min_reps\n"
-        f"         FROM gb),\n"
-        # Bertrand: a prime in (n, 2n] for every n in 2..500
-        f"       bt AS (SELECT CAST(sum(CASE WHEN t.c = 0"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS bertrand_viol"
-        f" FROM (\n"
-        f"           SELECT u.n, count(p.n) AS c FROM un u\n"
-        f"           LEFT JOIN pr p ON p.n > u.n"
-        f" AND p.n <= 2*u.n\n"
-        f"           WHERE u.n BETWEEN 2 AND 500"
-        f" GROUP BY u.n) t),\n"
-        f"       tw AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS twin_pairs\n"
-        f"         FROM pr a JOIN pr b ON b.n = a.n + 2),\n"
-        f"       cent AS{mat} (SELECT (p.n - 1) {d} 100 AS c,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_primes\n"
-        f"         FROM pr p GROUP BY (p.n - 1) {d} 100),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT c.c AS century, c.n_primes,\n"
-        f"       p.pi_direct, l.phi_na,\n"
-        f"       l.phi_na + 11 - 1 AS pi_legendre,\n"
-        f"       p.pi_direct - (l.phi_na + 10) AS legendre_resid,"
-        f"\n"
-        f"       g.goldbach_fail, g.n_even, g.min_reps,\n"
-        f"       b.bertrand_viol, t.twin_pairs, d2.n_docs\n"
-        f"FROM cent c CROSS JOIN pc p CROSS JOIN lg l\n"
-        f"CROSS JOIN gv g CROSS JOIN bt b CROSS JOIN tw t\n"
-        f"CROSS JOIN ld d2")
-
-
-@query("q634_primes_legendre",
-       "WITH " + _q634_sql("documents", "//", " MATERIALIZED"))
-def q634(spark, sf_dir):
-    """The primes to 1000 — counted two unrelated ways, with
-    Goldbach and Bertrand verified on every instance in range
-    (Legendre 1808, Goldbach 1742, Bertrand 1845/Chebyshev 1852).
-    The integer universe builds from doc residues; primality is
-    one anti-join against the 11 small primes (any composite
-    <= 1000 has a factor <= 31), giving pi_direct == 168 and the
-    classical per-century staircase 25, 21, 16, ... emitted as
-    the output rows.  Legendre's formula then recounts WITHOUT
-    testing a single number above 31: phi(1000, 11) as an
-    inclusion-exclusion over all 2^11 subsets of the small
-    primes — subset products built by chained CASE
-    multiplication, floor divisions exact — and legendre_resid
-    == 0 ties pi = phi + a - 1 to the direct count: sieve and
-    IE, two machines, one 168.  Goldbach's conjecture is checked
-    exhaustively in range: every even number 4..1000 has at
-    least one prime decomposition (goldbach_fail == 0 over all
-    499, min_reps emitted), and Bertrand's postulate holds for
-    every n in 2..500 (a prime in (n, 2n], bertrand_viol == 0)
-    — famous statements as finite computations, the honest
-    scope stated.  twin_pairs == 35 rides along.  Scale: the
-    universe is a generated dim; every check is one join + one
-    aggregation — certifying number-theoretic lookup tables at
-    fleet scale is exactly this shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q634_documents")
-    return spark.sql(
-        "WITH " + _q634_sql("q634_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q635: totient and Möbius — the divisor-lattice identities
-
-
-def _q635_sql(tbl: str, d: str, mat: str) -> str:
-    sd = ", ".join(f"({p})" for p in
-                   [2, 3, 5, 7, 11, 13, 17])
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 300 + 1"
-        f" AS BIGINT) AS n FROM {tbl}),\n"
-        f"       sp AS (SELECT CAST(p AS BIGINT) AS p FROM\n"
-        f"           (VALUES {sd}) t(p)),\n"
-        # primes to 300 (factor bound 17 since 17^2 < 300 < 19^2)
-        f"       pr AS{mat} (SELECT u.n AS p FROM nd u\n"
-        f"         LEFT JOIN sp s ON u.n % s.p = 0"
-        f" AND u.n <> s.p\n"
-        f"         WHERE u.n >= 2 GROUP BY u.n\n"
-        f"         HAVING count(s.p) = 0),\n"
-        f"       dv AS{mat} (SELECT a.n, b.n AS dd FROM nd a\n"
-        f"         JOIN nd b ON a.n % b.n = 0),\n"
-        # phi by coprime counting (gcd = 1 iff no shared divisor)
-        f"       ph2 AS{mat} (SELECT n,"
-        f" CAST(count(*) AS BIGINT) AS phi\n"
-        f"         FROM (SELECT a.n, k.n AS k FROM nd a\n"
-        f"           JOIN nd k ON k.n <= a.n\n"
-        f"           LEFT JOIN (SELECT n AS g FROM nd"
-        f" WHERE n >= 2) g\n"
-        f"             ON a.n % g.g = 0 AND k.n % g.g = 0\n"
-        f"           GROUP BY a.n, k.n HAVING count(g.g) = 0) t\n"
-        f"         GROUP BY n),\n"
-        # Möbius from factorization: 0 unless squarefree, else
-        # parity of the distinct-prime count
-        f"       mu AS{mat} (SELECT a.n,\n"
-        f"           CAST(CASE WHEN max(CASE WHEN\n"
-        f"             a.n % (p.p*p.p) = 0 THEN 1 ELSE 0 END)"
-        f" = 1 THEN 0\n"
-        f"             WHEN count(CASE WHEN a.n % p.p = 0"
-        f" THEN 1 END) % 2 = 0\n"
-        f"             THEN 1 ELSE -1 END AS BIGINT) AS mu\n"
-        f"         FROM nd a LEFT JOIN pr p ON a.n % p.p = 0\n"
-        f"         GROUP BY a.n),\n"
-        # Gauss: sum of phi over divisors == n, for every n
-        f"       gs AS (SELECT CAST(sum(CASE WHEN t.s <> t.n\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS gauss_viol FROM (\n"
-        f"           SELECT v.n, sum(p2.phi) AS s FROM dv v\n"
-        f"           JOIN ph2 p2 ON p2.n = v.dd"
-        f" GROUP BY v.n) t),\n"
-        # Möbius identity: sum over divisors == [n = 1]\n"
-        f"       mi AS (SELECT CAST(sum(CASE WHEN t.s <>\n"
-        f"           CASE WHEN t.n = 1 THEN 1 ELSE 0 END"
-        f" THEN 1 ELSE 0 END)\n"
-        f"           AS BIGINT) AS mobius_viol FROM (\n"
-        f"           SELECT v.n, sum(m.mu) AS s FROM dv v\n"
-        f"           JOIN mu m ON m.n = v.dd GROUP BY v.n) t),\n"
-        # Möbius inversion of Gauss: phi(n) == sum mu(d) n/d
-        f"       iv AS (SELECT CAST(sum(CASE WHEN t.s <> p2.phi\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS inversion_viol FROM (\n"
-        f"           SELECT v.n, sum(m.mu*(v.n {d} v.dd)) AS s\n"
-        f"           FROM dv v JOIN mu m ON m.n = v.dd\n"
-        f"           GROUP BY v.n) t\n"
-        f"         JOIN ph2 p2 ON p2.n = t.n),\n"
-        # multiplicativity on every coprime pair with mn <= 300
-        f"       ml AS (SELECT CAST(sum(CASE WHEN pp.phi <>\n"
-        f"           pa.phi*pb.phi THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS mult_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_mult_pairs\n"
-        f"         FROM nd a JOIN nd b ON a.n < b.n"
-        f" AND a.n*b.n <= 300 AND a.n >= 2\n"
-        f"         LEFT JOIN (SELECT n AS g FROM nd"
-        f" WHERE n >= 2) g\n"
-        f"           ON a.n % g.g = 0 AND b.n % g.g = 0\n"
-        f"         JOIN ph2 pa ON pa.n = a.n\n"
-        f"         JOIN ph2 pb ON pb.n = b.n\n"
-        f"         JOIN ph2 pp ON pp.n = a.n*b.n\n"
-        f"         GROUP BY a.n, b.n, pa.phi, pb.phi, pp.phi\n"
-        f"         HAVING count(g.g) = 0),\n"
-        f"       mlz AS (SELECT CAST(sum(mult_viol) AS BIGINT)"
-        f" AS mult_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_mult_pairs"
-        f" FROM ml),\n"
-        f"       mrt AS (SELECT CAST(sum(mu) AS BIGINT)"
-        f" AS mertens_300 FROM mu),\n"
-        f"       blk AS{mat} (SELECT (p2.n - 1) {d} 30 AS b,\n"
-        f"           CAST(sum(p2.phi) AS BIGINT) AS phi_sum,\n"
-        f"           CAST(sum(m.mu) AS BIGINT) AS mu_sum\n"
-        f"         FROM ph2 p2 JOIN mu m ON m.n = p2.n\n"
-        f"         GROUP BY (p2.n - 1) {d} 30),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT k.b AS block, k.phi_sum, k.mu_sum,\n"
-        f"       g.gauss_viol, i2.mobius_viol, v.inversion_viol,"
-        f"\n"
-        f"       z.mult_viol, z.n_mult_pairs, r.mertens_300,\n"
-        f"       l.n_docs\n"
-        f"FROM blk k CROSS JOIN gs g CROSS JOIN mi i2\n"
-        f"CROSS JOIN iv v CROSS JOIN mlz z CROSS JOIN mrt r\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q635_totient_mobius",
-       "WITH " + _q635_sql("documents", "//", " MATERIALIZED"))
-def q635(spark, sf_dir):
-    """Euler's totient and the Möbius function with the divisor-
-    lattice identities verified at every point (Euler 1763,
-    Möbius 1832, Gauss; the arithmetic functions under hashing,
-    group orders, and q618's RSA exponent — and q625's
-    inclusion-exclusion machinery transplanted from the Boolean
-    lattice to the divisor lattice).  For every n <= 300: phi by
-    brute coprime counting (no shared divisor >= 2 — an
-    anti-join), mu from factorization against the computed prime
-    dim (0 unless squarefree, else parity of the distinct-prime
-    count).  Then the identities, each over ALL 300 instances:
-    GAUSS — sum of phi over the divisors of n is exactly n
-    (gauss_viol == 0, the identity that makes phi the cyclic
-    group's subgroup census); the MOBIUS identity — sum of mu
-    over divisors vanishes except at n = 1 (mobius_viol == 0,
-    the delta that powers inversion); MOBIUS INVERSION itself —
-    phi(n) == sum mu(d) * n/d, i.e. inverting Gauss recovers
-    phi (inversion_viol == 0 — the lattice-dual of q625's
-    atom-by-atom check); and MULTIPLICATIVITY on every coprime
-    pair with product in range (mult_viol == 0 over
-    n_mult_pairs).  Mertens M(300) == -5 and per-block phi/mu
-    sums are emitted — the slow drift toward 3n^2/pi^2 visible
-    in the blocks.  Scale: the divisor table is one mod-join;
-    each identity is one grouped aggregation over it."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q635_documents")
-    return spark.sql(
-        "WITH " + _q635_sql("q635_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q636: Markov chains — exact stationarity, Kolmogorov's criterion
-
-
-_Q636_W = [[0, 3, 2, 1], [3, 0, 4, 0], [2, 4, 0, 5],
-           [1, 0, 5, 0]]
-_Q636_Q = [[1, 6, 3], [2, 3, 5], [5, 2, 3]]   # rows /10
-
-
-def _q636_sql(tbl: str, d: str, mat: str) -> str:
-    wv = ", ".join(f"({i}, {j}, {w})" for i, r in
-                   enumerate(_Q636_W) for j, w in enumerate(r))
-    qv = ", ".join(f"({i}, {j}, {q})" for i, r in
-                   enumerate(_Q636_Q) for j, q in enumerate(r))
-    return (
-        f"wd AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        f" BIGINT) AS j,\n"
-        f"           CAST(w AS BIGINT) AS w\n"
-        f"         FROM (VALUES {wv}) t(i, j, w)),\n"
-        f"       qd AS (SELECT CAST(i AS BIGINT) AS i, CAST(j"
-        f" AS BIGINT) AS j,\n"
-        f"           CAST(q AS BIGINT) AS q\n"
-        f"         FROM (VALUES {qv}) t(i, j, q)),\n"
-        f"       dg AS{mat} (SELECT i, CAST(sum(w) AS BIGINT)"
-        f" AS deg\n"
-        f"         FROM wd GROUP BY i),\n"
-        # reversible chain: pi = deg/2W; stationarity is the
-        # column-sum identity, detailed balance is symmetry
-        f"       rv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN cs.s <> g.deg THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT)"
-        f" AS stationary_viol,\n"
-        f"           CAST(sum(CASE WHEN sym.bad = 1 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS balance_viol\n"
-        f"         FROM dg g\n"
-        f"         JOIN (SELECT j, sum(w) AS s FROM wd"
-        f" GROUP BY j) cs ON cs.j = g.i\n"
-        f"         JOIN (SELECT a.i, max(CASE WHEN a.w <> b.w\n"
-        f"             THEN 1 ELSE 0 END) AS bad\n"
-        f"           FROM wd a JOIN wd b ON b.i = a.j"
-        f" AND b.j = a.i\n"
-        f"           GROUP BY a.i) sym ON sym.i = g.i),\n"
-        # Kolmogorov on all ordered 3-cycles, both chains
-        f"       kc AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN f.w*g2.w*h.w <>\n"
-        f"             f2.w*g3.w*h2.w THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS kolmo_rev_viol\n"
-        f"         FROM wd f JOIN wd g2 ON g2.i = f.j\n"
-        f"         JOIN wd h ON h.i = g2.j AND h.j = f.i\n"
-        f"         JOIN wd f2 ON f2.i = f.i AND f2.j = g2.j\n"
-        f"         JOIN wd g3 ON g3.i = g2.j AND g3.j = f.j\n"
-        f"         JOIN wd h2 ON h2.i = f.j AND h2.j = f.i\n"
-        f"         WHERE f.i <> f.j AND g2.j <> f.i"
-        f" AND g2.j <> f.j),\n"
-        f"       kq AS (SELECT\n"
-        f"           CAST(max(CASE WHEN f.q*g2.q*h.q <>\n"
-        f"             f2.q*g3.q*h2.q THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS q_nonreversible,\n"
-        f"           CAST(max(f.q*g2.q*h.q) AS BIGINT)"
-        f" AS cyc_fwd,\n"
-        f"           CAST(max(f2.q*g3.q*h2.q) AS BIGINT)"
-        f" AS cyc_bwd\n"
-        f"         FROM qd f JOIN qd g2 ON g2.i = f.j\n"
-        f"         JOIN qd h ON h.i = g2.j AND h.j = f.i\n"
-        f"         JOIN qd f2 ON f2.i = f.i AND f2.j = g2.j\n"
-        f"         JOIN qd g3 ON g3.i = g2.j AND g3.j = f.j\n"
-        f"         JOIN qd h2 ON h2.i = f.j AND h2.j = f.i\n"
-        f"         WHERE f.i = 0 AND f.j = 1 AND g2.j = 2),\n"
-        # exact stationary vector of Q by Cramer (den 46 after
-        # reduction; verified as the integer identity below)
-        f"       piq AS{mat} (SELECT CAST(13 AS BIGINT) AS p0,\n"
-        f"           CAST(16 AS BIGINT) AS p1,"
-        f" CAST(17 AS BIGINT) AS p2,\n"
-        f"           CAST(46 AS BIGINT) AS den),\n"
-        f"       pst AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           13*q0.q + 16*q1.q + 17*q2.q <>\n"
-        f"           10*(CASE jx.j WHEN 0 THEN 13 WHEN 1 THEN 16"
-        f"\n"
-        f"             ELSE 17 END) THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS pi_viol\n"
-        f"         FROM (SELECT DISTINCT j FROM qd) jx\n"
-        f"         JOIN qd q0 ON q0.i = 0 AND q0.j = jx.j\n"
-        f"         JOIN qd q1 ON q1.i = 1 AND q1.j = jx.j\n"
-        f"         JOIN qd q2 ON q2.i = 2 AND q2.j = jx.j),\n"
-        # power iteration: 8 exact matrix-multiply stages
-        f"       m0 AS (SELECT a.i, a.j,\n"
-        f"           CAST(CASE WHEN a.i = a.j THEN 1 ELSE 0 END"
-        f" AS BIGINT) AS v\n"
-        f"         FROM (SELECT DISTINCT i, j FROM qd) a),\n"
-        + ",\n       ".join(
-            f"m{k} AS{mat} (SELECT m.i, q.j,"
-            f" CAST(sum(m.v*q.q) AS BIGINT) AS v\n"
-            f"         FROM m{k - 1} m JOIN qd q ON q.i = m.j\n"
-            f"         GROUP BY m.i, q.j)"
-            for k in range(1, 9)) + ",\n"
-        f"       sps AS{mat} ("
-        + "\n         UNION ALL ".join(
-            f"SELECT CAST({k} AS BIGINT) AS k,\n"
-            f"           CAST(max(s.sp) AS BIGINT) AS span\n"
-            f"         FROM (SELECT j, max(v) - min(v) AS sp\n"
-            f"           FROM m{k} GROUP BY j) s"
-            for k in range(1, 9)) + "),\n"
-        f"       spc AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN a.span*10 < b.span"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT)"
-        f" AS contraction_viol\n"
-        f"         FROM sps a JOIN sps b ON b.k = a.k + 1),\n"
-        # P^8 rows approach pi: |46*P8_ij - pi_j*10^8| bounded
-        # by 46*span_8, per entry
-        f"       cnv AS (SELECT\n"
-        f"           CAST(max(abs(46*m.v -\n"
-        f"             (CASE m.j WHEN 0 THEN 13 WHEN 1 THEN 16\n"
-        f"              ELSE 17 END)*100000000)) AS BIGINT)"
-        f" AS max_dev,\n"
-        f"           CAST(max(s.span)*46 AS BIGINT)"
-        f" AS dev_bound\n"
-        f"         FROM m8 m CROSS JOIN\n"
-        f"           (SELECT span FROM sps WHERE k = 8) s),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT m.i, m.j, m.v AS p8_num,\n"
-        f"       r.stationary_viol, r.balance_viol,\n"
-        f"       c.kolmo_rev_viol, q.q_nonreversible,\n"
-        f"       q.cyc_fwd, q.cyc_bwd, p.pi_viol,\n"
-        f"       x.contraction_viol, v.max_dev, v.dev_bound,\n"
-        f"       CAST(CASE WHEN v.max_dev <= v.dev_bound THEN 1\n"
-        f"         ELSE 0 END AS BIGINT) AS dev_ok,\n"
-        f"       l.n_docs\n"
-        f"FROM m8 m CROSS JOIN rv r CROSS JOIN kc c\n"
-        f"CROSS JOIN kq q CROSS JOIN pst p CROSS JOIN spc x\n"
-        f"CROSS JOIN cnv v CROSS JOIN ld l")
-
-
-@query("q636_markov_kolmogorov",
-       "WITH " + _q636_sql("documents", "//", " MATERIALIZED"))
-def q636(spark, sf_dir):
-    """Markov chains in exact arithmetic — stationarity,
-    reversibility, and Perron-Frobenius contraction with no
-    floats anywhere (Kolmogorov 1936, Dobrushin 1956; the
-    convergence facts under every PageRank-style iteration,
-    here checked as integer identities).  Two chains share the
-    plan: the random walk on a weighted graph, whose stationary
-    vector is degree/2W — stationarity reduces to the
-    column-sum identity (stationary_viol == 0) and detailed
-    balance to weight symmetry (balance_viol == 0), with
-    Kolmogorov's criterion passing on every ordered 3-cycle
-    (kolmo_rev_viol == 0: cycle products equal both ways, the
-    characterization of reversibility that needs no stationary
-    vector at all); and a NON-reversible 3-state chain whose
-    cycle products 150 vs 12 differ (q_nonreversible == 1 —
-    the criterion genuinely discriminates).  The non-reversible
-    chain's exact stationary vector (13, 16, 17)/46 is verified
-    as the integer identity sum_i pi_i q_ij == 10 pi_j at every
-    j (pi_viol == 0), and eight exact matrix-power stages
-    (numerators over 10^k) exhibit convergence THEOREM-style:
-    column spans shrink monotonically (contraction_viol == 0 —
-    the Dobrushin contraction, as integer inequalities), and
-    every entry of P^8 sits within the span bound of the
-    stationary value (max_dev <= dev_bound, dev_ok == 1) — the
-    power method's error bounded by its own certificate.  Scale:
-    dims are broadcast; the power stages are the q567 PageRank
-    shape with the convergence PROOF carried in-plan."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q636_documents")
-    return spark.sql(
-        "WITH " + _q636_sql("q636_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q637: Shamir secret sharing — reconstruction and perfect secrecy
-
-
-def _q637_sql(tbl: str, d: str, mat: str) -> str:
-    import itertools as _it
-    trip = ", ".join(f"({a}, {b}, {c})" for a, b, c in
-                     _it.combinations(range(1, 6), 3))
-    return (
-        f"fd AS (SELECT DISTINCT CAST(doc_id % 101 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       iv AS{mat} (SELECT a.x, b.x AS inv FROM fd a\n"
-        f"         JOIN fd b ON (a.x*b.x) % 101 = 1),\n"
-        f"       sc AS{mat} (SELECT doc_id,\n"
-        f"           CAST(n_chars % 101 AS BIGINT) AS s,\n"
-        f"           CAST(doc_id % 101 AS BIGINT) AS a1,\n"
-        f"           CAST((doc_id*7 + 3) % 101 AS BIGINT)"
-        f" AS a2\n"
-        f"         FROM {tbl}),\n"
-        f"       xd AS (SELECT CAST(x AS BIGINT) AS x FROM\n"
-        f"           (VALUES (1), (2), (3), (4), (5)) t(x)),\n"
-        f"       sh AS{mat} (SELECT c.doc_id, c.s, x.x,\n"
-        f"           (c.s + c.a1*x.x + c.a2*x.x*x.x) % 101"
-        f" AS y\n"
-        f"         FROM sc c CROSS JOIN xd x),\n"
-        f"       tr AS (SELECT CAST(x1 AS BIGINT) AS x1,"
-        f" CAST(x2 AS BIGINT) AS x2,\n"
-        f"           CAST(x3 AS BIGINT) AS x3\n"
-        f"         FROM (VALUES {trip}) t(x1, x2, x3)),\n"
-        # Lagrange-at-zero coefficients per triple, via the
-        # exhaustive inverse dim (q618 discipline)
-        f"       lc AS{mat} (SELECT t.x1, t.x2, t.x3,\n"
-        f"           (t.x2*t.x3 % 101)\n"
-        f"             * i12.inv % 101 * i13.inv % 101 AS l1,\n"
-        f"           (t.x1*t.x3 % 101)\n"
-        f"             * i21.inv % 101 * i23.inv % 101 AS l2,\n"
-        f"           (t.x1*t.x2 % 101)\n"
-        f"             * i31.inv % 101 * i32.inv % 101 AS l3\n"
-        f"         FROM tr t\n"
-        f"         JOIN iv i12 ON i12.x = (t.x2 - t.x1 + 101)"
-        f" % 101\n"
-        f"         JOIN iv i13 ON i13.x = (t.x3 - t.x1 + 101)"
-        f" % 101\n"
-        f"         JOIN iv i21 ON i21.x = (t.x1 - t.x2 + 101)"
-        f" % 101\n"
-        f"         JOIN iv i23 ON i23.x = (t.x3 - t.x2 + 101)"
-        f" % 101\n"
-        f"         JOIN iv i31 ON i31.x = (t.x1 - t.x3 + 101)"
-        f" % 101\n"
-        f"         JOIN iv i32 ON i32.x = (t.x2 - t.x3 + 101)"
-        f" % 101),\n"
-        # every 3-subset reconstructs the secret, every document
-        f"       rc AS{mat} (SELECT s1.doc_id, l.x1, l.x2,"
-        f" l.x3,\n"
-        f"           (s1.y*l.l1 + s2.y*l.l2 + s3.y*l.l3) % 101"
-        f" AS recon,\n"
-        f"           s1.s\n"
-        f"         FROM lc l\n"
-        f"         JOIN sh s1 ON s1.x = l.x1\n"
-        f"         JOIN sh s2 ON s2.x = l.x2"
-        f" AND s2.doc_id = s1.doc_id\n"
-        f"         JOIN sh s3 ON s3.x = l.x3"
-        f" AND s3.doc_id = s1.doc_id),\n"
-        f"       rv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN recon <> s THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS recon_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_recon\n"
-        f"         FROM rc),\n"
-        # perfect secrecy on the representative document: given
-        # shares at x = 1, 2 only, EVERY candidate secret admits
-        # exactly one consistent polynomial
-        f"       rp AS (SELECT s, a1, a2 FROM sc"
-        f" WHERE doc_id = 0),\n"
-        f"       sh12 AS (SELECT\n"
-        f"           max(CASE WHEN x = 1 THEN y END) AS y1,\n"
-        f"           max(CASE WHEN x = 2 THEN y END) AS y2,\n"
-        f"           max(CASE WHEN x = 3 THEN y END) AS y3\n"
-        f"         FROM sh WHERE doc_id = 0),\n"
-        f"       cand AS{mat} (SELECT f.x AS sp,\n"
-        # a2' = (s' - 2 y1 + y2) * inv(2); a1' = y1 - s' - a2'
-        f"           ((f.x + 202 - 2*h.y1 + h.y2) % 101)"
-        f" * i2.inv % 101 AS a2p,\n"
-        f"           h.y1, h.y2, h.y3\n"
-        f"         FROM fd f CROSS JOIN sh12 h\n"
-        f"         JOIN iv i2 ON i2.x = 2),\n"
-        f"       cchk AS{mat} (SELECT c.sp, c.a2p,\n"
-        f"           (c.y1 + 202 - c.sp - c.a2p) % 101 AS a1p,\n"
-        f"           c.y1, c.y2, c.y3 FROM cand c),\n"
-        f"       sec AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN\n"
-        f"             (c.sp + c.a1p*1 + c.a2p*1) % 101 <> c.y1"
-        f" OR\n"
-        f"             (c.sp + c.a1p*2 + c.a2p*4) % 101 <> c.y2\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS consist_viol,\n"
-        f"           CAST(count(DISTINCT c.a1p*101 + c.a2p)"
-        f" AS BIGINT) AS n_distinct_polys,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_candidates,\n"
-        f"           CAST(sum(CASE WHEN\n"
-        f"             (c.sp + c.a1p*3 + c.a2p*9) % 101 = c.y3\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_with_third\n"
-        f"         FROM cchk c),\n"
-        f"       thm AS (SELECT CAST(max(CASE WHEN\n"
-        f"           (c.sp + c.a1p*3 + c.a2p*9) % 101 = c.y3\n"
-        f"           THEN c.sp END) AS BIGINT)"
-        f" AS third_secret\n"
-        f"         FROM cchk c),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT h.x, h.y, h.s,\n"
-        f"       r.recon_viol, r.n_recon,\n"
-        f"       e.consist_viol, e.n_distinct_polys,\n"
-        f"       e.n_candidates, e.n_with_third,\n"
-        f"       t.third_secret,\n"
-        f"       t.third_secret - h.s AS third_resid,\n"
-        f"       l.n_docs\n"
-        f"FROM sh h CROSS JOIN rv r CROSS JOIN sec e\n"
-        f"CROSS JOIN thm t CROSS JOIN ld l\n"
-        f"WHERE h.doc_id = 0")
-
-
-@query("q637_shamir_sharing",
-       "WITH " + _q637_sql("documents", "//", " MATERIALIZED"))
-def q637(spark, sf_dir):
-    """Shamir (3,5) secret sharing over GF(101), with BOTH
-    defining properties measured — reconstruction by every
-    quorum, and perfect secrecy below threshold by exhaustion
-    (Shamir 1979; the polynomial trick under every key-ceremony
-    and threshold-signature scheme).  Every document gets a
-    degree-2 polynomial (secret = n_chars mod 101, coefficients
-    doc-derived) and five shares by pure column arithmetic;
-    modular inverses come from the exhaustive inverse dim.
-    RECONSTRUCTION: all C(5,3) == 10 share-triples carry
-    Lagrange-at-zero coefficients built relationally, and
-    recon_viol == 0 over n_recon = 10 x corpus rows — every
-    quorum of every document recovers the exact secret.
-    SECRECY: for the representative document, fix shares at
-    x = 1, 2 and sweep ALL 101 candidate secrets: each candidate
-    admits a consistent polynomial (consist_viol == 0 — solved
-    in closed form through inv(2), then re-VERIFIED against both
-    shares), and the 101 recovered polynomials are pairwise
-    distinct (n_distinct_polys == 101) — so the posterior over
-    secrets given two shares is exactly uniform: two shares
-    carry ZERO information, not 'hard to invert' but
-    information-theoretically nothing, counted.  Adding the
-    third share collapses the candidate set to exactly one
-    (n_with_third == 1) and that survivor IS the true secret
-    (third_resid == 0) — the threshold is sharp on both sides.
-    Scale: per-doc work is expression-only; the secrecy sweep is
-    a 101-row dim — the audit that distinguishes a vault from a
-    hope."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q637_documents")
-    return spark.sql(
-        "WITH " + _q637_sql("q637_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q638: Farey sequence — unimodular neighbors and mediant minimality
-
-
-def _q638_sql(tbl: str, d: str, mat: str) -> str:
-    return (
-        f"n9 AS (SELECT DISTINCT CAST(doc_id % 9 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       n17 AS (SELECT DISTINCT CAST(doc_id % 17"
-        f" AS BIGINT) AS x FROM {tbl}),\n"
-        # reduced fractions p/q, 0 <= p <= q <= 8
-        f"       fr AS{mat} (SELECT p.x AS p, q.x AS q\n"
-        f"         FROM n9 p JOIN n9 q ON q.x >= 1"
-        f" AND p.x <= q.x\n"
-        f"         LEFT JOIN (SELECT x FROM n9 WHERE x >= 2) g\n"
-        f"           ON p.x % g.x = 0 AND q.x % g.x = 0\n"
-        f"         GROUP BY p.x, q.x HAVING count(g.x) = 0),\n"
-        f"       rk AS{mat} (SELECT a.p, a.q,\n"
-        f"           CAST(count(*) AS BIGINT) AS rnk\n"
-        f"         FROM fr a JOIN fr b\n"
-        f"           ON b.p*a.q <= a.p*b.q\n"
-        f"         GROUP BY a.p, a.q),\n"
-        f"       adj AS{mat} (SELECT a.p AS p1, a.q AS q1,\n"
-        f"           b.p AS p2, b.q AS q2\n"
-        f"         FROM rk a JOIN rk b ON b.rnk = a.rnk + 1),\n"
-        f"       uni AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           abs(q1*p2 - p1*q2) <> 1 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS unimodular_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_adjacent\n"
-        f"         FROM adj),\n"
-        # mediant minimality: the smallest-denominator fraction
-        # strictly between neighbors is exactly the mediant
-        f"       med AS (SELECT CAST(sum(CASE WHEN t.pick <>\n"
-        f"           (a.q1 + a.q2)*32 + (a.p1 + a.p2) THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS mediant_viol"
-        f" FROM (\n"
-        f"           SELECT x.p1, x.q1, x.p2, x.q2,\n"
-        f"             min(qq.x*32 + pp.x) AS pick\n"
-        f"           FROM adj x\n"
-        f"           JOIN n17 qq ON qq.x >= 1\n"
-        f"           JOIN n17 pp ON pp.x <= qq.x\n"
-        f"             AND pp.x*x.q1 > x.p1*qq.x\n"
-        f"             AND pp.x*x.q2 < x.p2*qq.x\n"
-        f"           GROUP BY x.p1, x.q1, x.p2, x.q2) t\n"
-        f"         JOIN adj a ON a.p1 = t.p1 AND a.q1 = t.q1\n"
-        f"           AND a.p2 = t.p2 AND a.q2 = t.q2),\n"
-        # |F_8| = 1 + sum of totients, phi by coprime counting
-        f"       ph AS (SELECT CAST(1 + count(*) AS BIGINT)"
-        f" AS count_thm FROM\n"
-        f"           (SELECT q.x AS q, k.x AS k FROM n9 q\n"
-        f"            JOIN n9 k ON q.x >= 1 AND k.x >= 1"
-        f" AND k.x <= q.x\n"
-        f"            LEFT JOIN (SELECT x FROM n9 WHERE x >= 2)"
-        f" g\n"
-        f"              ON q.x % g.x = 0 AND k.x % g.x = 0\n"
-        f"            GROUP BY q.x, k.x\n"
-        f"            HAVING count(g.x) = 0) t),\n"
-        f"       cnt AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_farey FROM fr),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT r.rnk, r.p, r.q,\n"
-        f"       u.unimodular_viol, u.n_adjacent,\n"
-        f"       m.mediant_viol, c.n_farey, h.count_thm,\n"
-        f"       c.n_farey - h.count_thm AS count_resid,\n"
-        f"       l.n_docs\n"
-        f"FROM rk r CROSS JOIN uni u CROSS JOIN med m\n"
-        f"CROSS JOIN cnt c CROSS JOIN ph h CROSS JOIN ld l")
-
-
-@query("q638_farey_sequence",
-       "WITH " + _q638_sql("documents", "//", " MATERIALIZED"))
-def q638(spark, sf_dir):
-    """The Farey sequence F_8 with its three classical theorems
-    verified across the whole sequence (Farey/Cauchy 1816,
-    Stern-Brocot; the fraction order under rational
-    approximation — q603's convergents walk this tree).  The 23
-    reduced fractions build by coprime anti-join; ordering is
-    exact cross-multiplication (rank by a smaller-or-equal
-    self-join count — no division, no floats).  Then, on every
-    adjacent pair: UNIMODULARITY — q1 p2 - p1 q2 == +-1 for all
-    22 neighbor pairs (unimodular_viol == 0, the determinant
-    identity that makes Farey neighbors a matrix in SL2); the
-    MEDIANT theorem — sweeping ALL fractions with denominator up
-    to 16, the strictly-between candidate with minimal
-    denominator is EXACTLY the mediant (p1+p2)/(q1+q2) for every
-    pair (mediant_viol == 0, packed min over the candidate dim)
-    — the Stern-Brocot insertion rule observed rather than
-    assumed; and the COUNT identity |F_n| = 1 + sum phi(k),
-    with the totients recomputed in-plan by coprime counting
-    (count_resid == 0 — q635's phi meeting q603's fractions).
-    The full ordered sequence is the output.  Scale: dims are
-    bounded; ranking by cross-multiplied self-join is the
-    order-without-sorting pattern exact rational pipelines
-    need."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q638_documents")
-    return spark.sql(
-        "WITH " + _q638_sql("q638_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q639: Pick's theorem — exact lattice geometry on four polygons
-
-
-_Q639_POLYS = {
-    1: [(0, 0), (4, 0), (0, 3)],
-    2: [(0, 0), (5, 0), (5, 5), (0, 5)],
-    3: [(0, 0), (6, 0), (6, 2), (2, 2), (2, 6), (0, 6)],
-    4: [(0, 0), (7, 1), (8, 3)],
-}
-
-
-def _q639_sql(tbl: str, d: str, mat: str) -> str:
-    ed = []
-    for pid, vs in _Q639_POLYS.items():
-        n = len(vs)
-        for i in range(n):
-            x1, y1 = vs[i]
-            x2, y2 = vs[(i + 1) % n]
-            ed.append(f"({pid}, {x1}, {y1}, {x2}, {y2})")
-    edv = ", ".join(ed)
-    return (
-        f"gd AS (SELECT DISTINCT CAST(doc_id % 9 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       ed AS (SELECT CAST(pid AS BIGINT) AS pid,\n"
-        f"           CAST(x1 AS BIGINT) AS x1, CAST(y1 AS"
-        f" BIGINT) AS y1,\n"
-        f"           CAST(x2 AS BIGINT) AS x2, CAST(y2 AS"
-        f" BIGINT) AS y2\n"
-        f"         FROM (VALUES {edv}) t(pid, x1, y1, x2, y2)),\n"
-        # per (polygon, lattice point): boundary flag + crossings
-        f"       pt AS{mat} (SELECT e.pid, g1.x AS px,"
-        f" g2.x AS py,\n"
-        f"           CAST(max(CASE WHEN\n"
-        f"             (e.x2 - e.x1)*(g2.x - e.y1) -\n"
-        f"             (g1.x - e.x1)*(e.y2 - e.y1) = 0\n"
-        f"             AND g1.x >= least(e.x1, e.x2)\n"
-        f"             AND g1.x <= greatest(e.x1, e.x2)\n"
-        f"             AND g2.x >= least(e.y1, e.y2)\n"
-        f"             AND g2.x <= greatest(e.y1, e.y2)\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT) AS onb,\n"
-        f"           CAST(sum(CASE\n"
-        f"             WHEN e.y1 <= g2.x AND g2.x < e.y2 AND\n"
-        f"               (e.x2 - e.x1)*(g2.x - e.y1) -\n"
-        f"               (g1.x - e.x1)*(e.y2 - e.y1) > 0 THEN 1\n"
-        f"             WHEN e.y2 <= g2.x AND g2.x < e.y1 AND\n"
-        f"               (e.x2 - e.x1)*(g2.x - e.y1) -\n"
-        f"               (g1.x - e.x1)*(e.y2 - e.y1) < 0 THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS crossings\n"
-        f"         FROM ed e CROSS JOIN gd g1 CROSS JOIN gd g2\n"
-        f"         GROUP BY e.pid, g1.x, g2.x),\n"
-        f"       ib AS{mat} (SELECT pid,\n"
-        f"           CAST(sum(CASE WHEN onb = 0 AND"
-        f" crossings % 2 = 1\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT) AS i,\n"
-        f"           CAST(sum(onb) AS BIGINT) AS b\n"
-        f"         FROM pt GROUP BY pid),\n"
-        f"       ar AS{mat} (SELECT pid,\n"
-        f"           CAST(abs(sum(x1*y2 - x2*y1)) AS BIGINT)"
-        f" AS a2\n"
-        f"         FROM ed GROUP BY pid),\n"
-        # boundary count theorem: B = sum over edges of
-        # gcd(|dx|, |dy|), gcd from the divisor dim
-        f"       bg AS{mat} (SELECT e.pid,\n"
-        f"           CAST(sum(t.g) AS BIGINT) AS b_gcd\n"
-        f"         FROM ed e JOIN (SELECT e2.pid, e2.x1, e2.y1,\n"
-        f"             e2.x2, e2.y2, max(d2.x) AS g\n"
-        f"           FROM ed e2 JOIN gd d2 ON d2.x >= 1\n"
-        f"             AND abs(e2.x2 - e2.x1) % d2.x = 0\n"
-        f"             AND abs(e2.y2 - e2.y1) % d2.x = 0\n"
-        f"           GROUP BY e2.pid, e2.x1, e2.y1, e2.x2,"
-        f" e2.y2) t\n"
-        f"           ON t.pid = e.pid AND t.x1 = e.x1"
-        f" AND t.y1 = e.y1\n"
-        f"           AND t.x2 = e.x2 AND t.y2 = e.y2\n"
-        f"         GROUP BY e.pid),\n"
-        f"       vf AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN a.a2 <> 2*x.i + x.b - 2\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS pick_viol,\n"
-        f"           CAST(sum(CASE WHEN x.b <> g.b_gcd THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS bcount_viol\n"
-        f"         FROM ar a JOIN ib x ON x.pid = a.pid\n"
-        f"         JOIN bg g ON g.pid = a.pid),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT a.pid, a.a2, x.i, x.b, g.b_gcd,\n"
-        f"       a.a2 - (2*x.i + x.b - 2) AS pick_resid,\n"
-        f"       v.pick_viol, v.bcount_viol, l.n_docs\n"
-        f"FROM ar a JOIN ib x ON x.pid = a.pid\n"
-        f"JOIN bg g ON g.pid = a.pid\n"
-        f"CROSS JOIN vf v CROSS JOIN ld l")
-
-
-@query("q639_picks_theorem",
-       "WITH " + _q639_sql("documents", "//", " MATERIALIZED"))
-def q639(spark, sf_dir):
-    """Pick's theorem verified by counting every lattice point,
-    on convex, concave, and sliver polygons (Pick 1899; the
-    area-from-counting identity that connects this repo's
-    geometry kernels to pure arithmetic — a lattice-exact cousin
-    of the shoelace machinery the overlay stack runs on).  Four
-    polygons — right triangle, square, a CONCAVE L, and a thin
-    triangle with odd double-area 13 (area 6.5: the case that
-    catches any implementation secretly assuming integer area)
-    — are scanned against the full 9x9 lattice: boundary
-    membership is the exact collinearity-plus-bbox test, and
-    interior membership is the exact integer ray cast (upward
-    edges count at cross > 0, downward at cross < 0 — the
-    half-open rule that never double-counts a vertex), all in
-    BIGINT cross products.  Pick's identity 2A == 2I + B - 2
-    holds on every polygon (pick_viol == 0, per-polygon
-    residuals emitted), with 2A from the shoelace sum over the
-    edge dim.  The boundary count is itself re-derived from a
-    second theorem: B == sum over edges of gcd(|dx|, |dy|)
-    (bcount_viol == 0, gcd by divisor-dim max — the lattice-
-    point-on-segment census, q635's machinery on geometry).
-    Scale: point-in-polygon as exact integer column arithmetic
-    over a generated lattice IS the rasterize/PIP kernel's
-    semantics, here exhaustively cross-checked against two
-    independent counting identities."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q639_documents")
-    return spark.sql(
-        "WITH " + _q639_sql("q639_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q640: Latin squares of order 4 — census, reduction, orthogonality
-
-
-_Q640_PERMS = ", ".join(
-    f"({p[0]}, {p[1]}, {p[2]}, {p[3]})"
-    for p in __import__("itertools").permutations(range(4)))
-_Q640_A = [(0, 1, 2, 3), (1, 0, 3, 2), (2, 3, 0, 1),
-           (3, 2, 1, 0)]
-_Q640_B = [(0, 1, 2, 3), (2, 3, 0, 1), (3, 2, 1, 0),
-           (1, 0, 3, 2)]
-
-
-def _q640_sql(tbl: str, d: str, mat: str) -> str:
-    ab = ", ".join(
-        f"({r}, {c}, {_Q640_A[r][c]}, {_Q640_B[r][c]})"
-        for r in range(4) for c in range(4))
-    disj = lambda a, b: " AND ".join(
-        f"{a}.c{c} <> {b}.c{c}" for c in range(4))
-    return (
-        f"pd AS (SELECT CAST(c0 AS BIGINT) AS c0, CAST(c1 AS"
-        f" BIGINT) AS c1,\n"
-        f"           CAST(c2 AS BIGINT) AS c2, CAST(c3 AS"
-        f" BIGINT) AS c3\n"
-        f"         FROM (VALUES {_Q640_PERMS})"
-        f" t(c0, c1, c2, c3)),\n"
-        f"       sq AS{mat} (SELECT\n"
-        f"           r1.c0 AS a0, r1.c1 AS a1, r1.c2 AS a2,"
-        f" r1.c3 AS a3,\n"
-        f"           r2.c0 AS b0, r2.c1 AS b1, r2.c2 AS b2,"
-        f" r2.c3 AS b3,\n"
-        f"           r3.c0 AS d0, r3.c1 AS d1, r3.c2 AS d2,"
-        f" r3.c3 AS d3,\n"
-        f"           r4.c0 AS e0, r4.c1 AS e1, r4.c2 AS e2,"
-        f" r4.c3 AS e3\n"
-        f"         FROM pd r1\n"
-        f"         JOIN pd r2 ON {disj('r1', 'r2')}\n"
-        f"         JOIN pd r3 ON {disj('r1', 'r3')}"
-        f" AND {disj('r2', 'r3')}\n"
-        f"         JOIN pd r4 ON {disj('r1', 'r4')}"
-        f" AND {disj('r2', 'r4')}\n"
-        f"           AND {disj('r3', 'r4')}),\n"
-        f"       cnt AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_total,\n"
-        f"           CAST(sum(CASE WHEN a0 = 0 AND a1 = 1 AND\n"
-        f"             a2 = 2 AND a3 = 3 AND b0 = 1 AND d0 = 2\n"
-        f"             AND e0 = 3 THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_reduced\n"
-        f"         FROM sq),\n"
-        f"       ab AS (SELECT CAST(r AS BIGINT) AS r, CAST(c"
-        f" AS BIGINT) AS c,\n"
-        f"           CAST(a AS BIGINT) AS a, CAST(b AS BIGINT)"
-        f" AS b\n"
-        f"         FROM (VALUES {ab}) t(r, c, a, b)),\n"
-        # orthogonality: the 16 (a,b) cell pairs are all distinct
-        f"       ort AS (SELECT\n"
-        f"           CAST(count(DISTINCT a*4 + b) AS BIGINT)"
-        f" AS n_pairs,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_cells\n"
-        f"         FROM ab),\n"
-        # both mates are Latin: row and column perms check out
-        f"       lat AS (SELECT CAST(sum(CASE WHEN rr.na <> 4"
-        f" OR rr.nb <> 4\n"
-        f"           OR cc.na <> 4 OR cc.nb <> 4 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS mates_latin_viol FROM\n"
-        f"           (SELECT r, count(DISTINCT a) AS na,\n"
-        f"             count(DISTINCT b) AS nb FROM ab"
-        f" GROUP BY r) rr\n"
-        f"         JOIN (SELECT c, count(DISTINCT a) AS na,\n"
-        f"             count(DISTINCT b) AS nb FROM ab"
-        f" GROUP BY c) cc ON rr.r = cc.c),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT c.n_total, c.n_reduced,\n"
-        f"       c.n_total - c.n_reduced*144"
-        f" AS reduction_resid,\n"
-        f"       o.n_pairs, o.n_cells,\n"
-        f"       CAST(CASE WHEN o.n_pairs = 16 THEN 1 ELSE 0"
-        f" END AS BIGINT) AS orthogonal,\n"
-        f"       t2.mates_latin_viol, l.n_docs\n"
-        f"FROM cnt c CROSS JOIN ort o CROSS JOIN lat t2\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q640_latin_squares",
-       "WITH " + _q640_sql("documents", "//", " MATERIALIZED"))
-def q640(spark, sf_dir):
-    """Latin squares of order 4 — the census by staged
-    exhaustion, the reduction identity, and a verified
-    Graeco-Latin pair (Euler 1782, Fisher's design-of-
-    experiments tradition; the structure under conflict-free
-    schedules and experiment blocking).  All squares build as a
-    four-way join of the 24-permutation dim with pairwise
-    column-disjointness conditions — n_total == 576, the
-    classical count, produced by enumeration rather than
-    formula.  The reduction identity is then checked as pure
-    arithmetic: exactly n_reduced == 4 squares have first row
-    AND first column in natural order, and 576 == 4 x 4! x 3!
-    (reduction_resid == 0) — the orbit decomposition under row/
-    column relabeling, with both factors measured.  Euler's
-    orthogonality question for order 4 is answered
-    constructively: the inlined pair of mates is verified Latin
-    in every row and column (mates_latin_viol == 0) and their
-    16 superimposed cell pairs are ALL DISTINCT (n_pairs == 16,
-    orthogonal == 1) — a Graeco-Latin square of order 4
-    exhibited and checked cell by cell, the object Euler's
-    36-officers conjecture denied at order 6.  Scale: the
-    enumeration is a staged dim join with early pruning — the
-    constraint-propagation shape of any conflict-free
-    assignment sweep."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q640_documents")
-    return spark.sql(
-        "WITH " + _q640_sql("q640_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q641: Shidoku — census, unique solution, clue-set minimality
-
-
-_Q641_CLUES = [(1, 2, 2), (1, 3, 3), (2, 3, 2), (3, 0, 0)]
-_Q641_SOL = ((2, 3, 1, 0), (1, 0, 2, 3), (3, 1, 0, 2),
-             (0, 2, 3, 1))
-
-
-def _q641_sql(tbl: str, d: str, mat: str) -> str:
-    disj = lambda a, b: " AND ".join(
-        f"{a}.c{c} <> {b}.c{c}" for c in range(4))
-    cl = ", ".join(f"({i}, {r}, {c}, {v})" for i, (r, c, v)
-                   in enumerate(_Q641_CLUES))
-    rows = ["a", "b", "d", "e"]
-    def cell(r, c):
-        return f"{rows[r]}{c}"
-    def clue_match(skip=None):
-        return " AND ".join(
-            f"(cd.i = {i} AND s.{cell(r, c)} = {v} OR"
-            f" cd.i <> {i})"
-            for i, (r, c, v) in enumerate(_Q641_CLUES)
-            if i != skip)
-    sol = " AND ".join(
-        f"s.{cell(r, c)} = {_Q641_SOL[r][c]}"
-        for r in range(4) for c in range(4))
-    def scell(r, c):
-        return f"r{r + 1}.c{c}"
-    box = " AND ".join(
-        f"{scell(br, bc)} <> {scell(br, bc + 1)} AND"
-        f" {scell(br, bc)} <> {scell(br + 1, bc)} AND"
-        f" {scell(br, bc)} <> {scell(br + 1, bc + 1)} AND"
-        f" {scell(br, bc + 1)} <> {scell(br + 1, bc)} AND"
-        f" {scell(br, bc + 1)} <> {scell(br + 1, bc + 1)} AND"
-        f" {scell(br + 1, bc)} <> {scell(br + 1, bc + 1)}"
-        for br in (0, 2) for bc in (0, 2))
-    matches = lambda skip: " AND ".join(
-        f"s.{cell(r, c)} = {v}"
-        for i, (r, c, v) in enumerate(_Q641_CLUES)
-        if i != skip)
-    drops = ",\n       ".join(
-        f"dr{i} AS (SELECT CAST(count(*) AS BIGINT) AS m\n"
-        f"         FROM sh s WHERE {matches(i)})"
-        for i in range(4))
-    return (
-        f"pd AS (SELECT CAST(c0 AS BIGINT) AS c0, CAST(c1 AS"
-        f" BIGINT) AS c1,\n"
-        f"           CAST(c2 AS BIGINT) AS c2, CAST(c3 AS"
-        f" BIGINT) AS c3\n"
-        f"         FROM (VALUES {_Q640_PERMS})"
-        f" t(c0, c1, c2, c3)),\n"
-        f"       sh AS{mat} (SELECT\n"
-        f"           r1.c0 AS a0, r1.c1 AS a1, r1.c2 AS a2,"
-        f" r1.c3 AS a3,\n"
-        f"           r2.c0 AS b0, r2.c1 AS b1, r2.c2 AS b2,"
-        f" r2.c3 AS b3,\n"
-        f"           r3.c0 AS d0, r3.c1 AS d1, r3.c2 AS d2,"
-        f" r3.c3 AS d3,\n"
-        f"           r4.c0 AS e0, r4.c1 AS e1, r4.c2 AS e2,"
-        f" r4.c3 AS e3\n"
-        f"         FROM pd r1\n"
-        f"         JOIN pd r2 ON {disj('r1', 'r2')}\n"
-        f"         JOIN pd r3 ON {disj('r1', 'r3')}"
-        f" AND {disj('r2', 'r3')}\n"
-        f"         JOIN pd r4 ON {disj('r1', 'r4')}"
-        f" AND {disj('r2', 'r4')}\n"
-        f"           AND {disj('r3', 'r4')}\n"
-        f"         WHERE {box}),\n"
-        f"       cnt AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_shidoku FROM sh),\n"
-        f"       pz AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_match\n"
-        f"         FROM sh s WHERE {matches(None)}),\n"
-        f"       swt AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS sol_is_match\n"
-        f"         FROM sh s WHERE {matches(None)}"
-        f" AND {sol}),\n"
-        f"       {drops},\n"
-        f"       mn AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN m < 2 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS minimality_viol,\n"
-        f"           CAST(min(m) AS BIGINT) AS min_after_drop\n"
-        f"         FROM (SELECT m FROM dr0 UNION ALL SELECT m"
-        f" FROM dr1\n"
-        f"           UNION ALL SELECT m FROM dr2"
-        f" UNION ALL SELECT m FROM dr3) t),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT c.n_shidoku, p.n_match, w.sol_is_match,\n"
-        f"       m.minimality_viol, m.min_after_drop,\n"
-        f"       l.n_docs\n"
-        f"FROM cnt c CROSS JOIN pz p CROSS JOIN swt w\n"
-        f"CROSS JOIN mn m CROSS JOIN ld l")
-
-
-@query("q641_shidoku_minimal",
-       "WITH " + _q641_sql("documents", "//", " MATERIALIZED"))
-def q641(spark, sf_dir):
-    """Shidoku (4x4 Sudoku) — the census, a uniquely-solvable
-    4-clue puzzle, and MINIMALITY of the clue set, all by
-    exhaustion (the Sudoku uniqueness question in its smallest
-    nontrivial form; the known Shidoku minimum is 4 clues,
-    exhibited here).  The grid space builds like q640's Latin
-    squares plus the four 2x2 box constraints — n_shidoku ==
-    288, exactly half the Latin count, by enumeration.  The
-    planted puzzle's four clues filter the space to n_match ==
-    1 (unique solvability — the property that makes a puzzle a
-    puzzle — established by checking all 288 grids, not by a
-    solver's say-so), and sol_is_match == 1 confirms the
-    survivor is the intended solution.  MINIMALITY is the
-    sharper claim and gets the sharper check: dropping ANY
-    single clue leaves at least two consistent grids
-    (minimality_viol == 0, min_after_drop >= 2, each 3-clue
-    subset swept against the full space) — every clue is
-    load-bearing, so 4 clues is not merely sufficient here but
-    locally necessary, matching the known Shidoku minimum.
-    Scale: puzzle validation by exhaustive model counting is
-    the honest uniqueness audit; the enumerate-filter-count
-    shape distributes trivially."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q641_documents")
-    return spark.sql(
-        "WITH " + _q641_sql("q641_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q642: abelian sandpile — two schedules, one stabilization
-
-
-_Q642_INIT = {(1, 1): 20, (2, 2): 20}
-_Q642_ROUNDS = {"par": 11, "str": 21}
-
-
-def _q642_base(tbl: str) -> str:
-    iv = ", ".join(f"({r}, {c}, {v})"
-                   for (r, c), v in _Q642_INIT.items())
-    return (
-        f"gd AS (SELECT DISTINCT CAST(doc_id % 4 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       od AS (SELECT CAST(dr AS BIGINT) AS dr,"
-        f" CAST(dc AS BIGINT) AS dc\n"
-        f"         FROM (VALUES (1, 0), (-1, 0), (0, 1),"
-        f" (0, -1)) t(dr, dc)),\n"
-        f"       iv AS (SELECT CAST(r AS BIGINT) AS r, CAST(c"
-        f" AS BIGINT) AS c,\n"
-        f"           CAST(v AS BIGINT) AS v\n"
-        f"         FROM (VALUES {iv}) t(r, c, v)),\n"
-        f"       g0 AS (SELECT a.x AS r, b.x AS c,\n"
-        f"           CAST(coalesce(i.v, 0) AS BIGINT) AS g,\n"
-        f"           CAST(0 AS BIGINT) AS odo\n"
-        f"         FROM gd a CROSS JOIN gd b\n"
-        f"         LEFT JOIN iv i ON i.r = a.x AND i.c = b.x)")
-
-
-def _q642_round(rnd: int, prev: str, od: str,
-                stripe: bool) -> str:
-    cond = f"f.g >= 4"
-    if stripe:
-        cond = (f"f.g >= 4 AND (f.r % 2 = {rnd % 2} OR NOT"
-                f" EXISTS (SELECT 1 FROM {prev} z WHERE"
-                f" z.g >= 4 AND z.r % 2 = {rnd % 2}))")
-    return (
-        f"SELECT p.r, p.c,\n"
-        f"  p.g - 4*(CASE WHEN {cond.replace('f.', 'p.')}"
-        f" THEN 1 ELSE 0 END)\n"
-        f"    + coalesce(nb.k, 0) AS g,\n"
-        f"  p.odo + (CASE WHEN {cond.replace('f.', 'p.')}"
-        f" THEN 1 ELSE 0 END) AS odo\n"
-        f"FROM {prev} p LEFT JOIN (\n"
-        f"  SELECT f.r + o.dr AS r, f.c + o.dc AS c,\n"
-        f"    CAST(count(*) AS BIGINT) AS k\n"
-        f"  FROM {prev} f CROSS JOIN {od} o\n"
-        f"  WHERE {cond}\n"
-        f"  GROUP BY f.r + o.dr, f.c + o.dc) nb\n"
-        f"  ON nb.r = p.r AND nb.c = p.c")
-
-
-def _q642_final(pf: str, sf: str, tbl: str, mat: str) -> str:
-    return (
-        f"cmp AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN a.g <> b.g THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS final_resid,\n"
-        f"           CAST(sum(CASE WHEN a.odo <> b.odo THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS odometer_resid,"
-        f"\n"
-        f"           CAST(sum(CASE WHEN a.g >= 4 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_unstable,\n"
-        f"           CAST(sum(a.g) AS BIGINT) AS grains_kept,\n"
-        f"           CAST(sum(a.odo*(4 -\n"
-        f"             ((CASE WHEN a.r > 0 THEN 1 ELSE 0 END)\n"
-        f"              + (CASE WHEN a.r < 3 THEN 1 ELSE 0 END)\n"
-        f"              + (CASE WHEN a.c > 0 THEN 1 ELSE 0 END)\n"
-        f"              + (CASE WHEN a.c < 3 THEN 1 ELSE 0"
-        f" END)))) AS BIGINT) AS grains_lost\n"
-        f"         FROM {pf} a JOIN {sf} b ON b.r = a.r"
-        f" AND b.c = a.c),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT a.r, a.c, a.g, a.odo,\n"
-        f"       m.final_resid, m.odometer_resid, m.n_unstable,\n"
-        f"       m.grains_kept, m.grains_lost,\n"
-        f"       m.grains_kept + m.grains_lost - 40"
-        f" AS conservation_resid,\n"
-        f"       l.n_docs\n"
-        f"FROM {pf} a CROSS JOIN cmp m CROSS JOIN ld l")
-
-
-def _q642_oracle(tbl: str = "documents") -> str:
-    parts = [_q642_base(tbl)]
-    prev = "g0"
-    for r in range(1, _Q642_ROUNDS["par"] + 1):
-        parts.append(f"p{r} AS MATERIALIZED"
-                     f" ({_q642_round(r, prev, 'od', False)})")
-        prev = f"p{r}"
-    pfin = prev
-    prev = "g0"
-    for r in range(1, _Q642_ROUNDS["str"] + 1):
-        parts.append(f"s{r} AS MATERIALIZED"
-                     f" ({_q642_round(r, prev, 'od', True)})")
-        prev = f"s{r}"
-    parts.append(_q642_final(pfin, prev, tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q642_abelian_sandpile", _q642_oracle())
-def q642(spark, sf_dir):
-    """The abelian sandpile — two genuinely different firing
-    schedules forced to agree on BOTH the stabilization and the
-    odometer (Bak-Tang-Wiesenfeld 1987, Dhar 1990; the abelian
-    property is why chip-firing can run as a lock-free
-    distributed computation at all).  Two 20-grain piles on a
-    4x4 sink-bounded grid interact mid-cascade; schedule one
-    fires ALL unstable sites each round (the Pregel move, 10
-    rounds), schedule two fires only alternating-parity ROWS
-    (20 rounds, with a fallback that keeps it legal) — their
-    intermediate states diverge from the very first round, yet
-    Dhar's theorem demands identical endpoints, and gets them:
-    final_resid == 0 cell-for-cell AND odometer_resid == 0 —
-    not just the same sandpile but the same NUMBER of firings
-    at every site, the strong abelian property, which is what
-    licenses firing in any order on any shard.  Stability is
-    proven, not assumed (one extra round each; n_unstable ==
-    0), and grains are accounted exactly: kept + lost == 40
-    where the loss is RE-DERIVED from the odometer (each firing
-    leaks 4 - degree grains off the boundary;
-    conservation_resid == 0 ties the odometer to the sink flux).
-    The final configuration and odometer are the output.
-    Scale: one round = one flag projection + one neighbor-
-    offset aggregation — exactly the halo-exchange shape of the
-    repo's focal kernels, with a commutation theorem on top."""
-    # Round-5 (the q598/q610 pattern): the 4x4 arena is a LITERAL
-    # (corpus dim asserted) — both stabilization schedules run
-    # driver-side mirroring the round spec (synchronous topples,
-    # stripe gate with its global fallback, off-grid grains to the
-    # sink), and the CERTIFICATES — abelian final/odometer
-    # equality across the two schedules, grain conservation via
-    # border flux — stay relational over the pushed tables.
-    # Formerly 35 pins, 4.3 s.
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q642_documents")
-    pdf4 = spark.sql("SELECT DISTINCT doc_id % 4 AS x FROM"
-                     " q642_documents").toPandas()
-    assert len(pdf4) == 4, len(pdf4)
-    cells = [(r, c) for r in range(4) for c in range(4)]
-    offs = ((1, 0), (-1, 0), (0, 1), (0, -1))
-
-    def _run(rounds, stripe):
-        st = {rc: _Q642_INIT.get(rc, 0) for rc in cells}
-        odo = {rc: 0 for rc in cells}
-        for rnd in range(1, rounds + 1):
-            if stripe:
-                has = any(v >= 4 and r % 2 == rnd % 2
-                          for (r, _c), v in st.items())
-
-                def cond(r, c):
-                    return st[(r, c)] >= 4 and (
-                        r % 2 == rnd % 2 or not has)
-            else:
-                def cond(r, c):
-                    return st[(r, c)] >= 4
-            topple = {rc for rc in cells if cond(*rc)}
-            inc: dict = {}
-            for r, c in topple:
-                for dr, dc in offs:
-                    k = (r + dr, c + dc)
-                    inc[k] = inc.get(k, 0) + 1
-            st = {rc: st[rc] - (4 if rc in topple else 0)
-                  + inc.get(rc, 0) for rc in cells}
-            for rc in topple:
-                odo[rc] += 1
-        return st, odo
-
-    for nm, (rounds, stripe) in (("pf", (11, False)),
-                                 ("sf", (21, True))):
-        st, odo = _run(rounds, stripe)
-        local_df(spark,
-                 sorted((r, c, st[(r, c)], odo[(r, c)])
-                        for r, c in cells),
-                 "r long, c long, g long, odo long") \
-            .createOrReplaceTempView(f"q642_{nm}")
-    fin = _q642_final("q642_pf", "q642_sf", "q642_documents", "")
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q643: busy beaver BB(2) — Rado's numbers by total exhaustion
-
-
-def _q643_sql(tbl: str, d: str, mat: str) -> str:
-    # machine space: 4 transition slots x 12 codes
-    # code: w = t % 2, move = (t div 2) % 2 (1 = R), nxt = t div 4
-    # (0 = A, 1 = B, 2 = HALT); tape 17 bits at offset +8
-    parts = [
-        f"cd AS (SELECT DISTINCT CAST(doc_id % 12 AS BIGINT)"
-        f" AS t FROM {tbl})",
-        f"pw AS (SELECT CAST(x AS BIGINT) AS x, CAST(p AS"
-        f" BIGINT) AS p FROM (VALUES "
-        + ", ".join(f"({x}, {1 << x})" for x in range(17))
-        + ") t(x, p))",
-        f"m0 AS (SELECT t1.t AS t1, t2.t AS t2, t3.t AS t3,"
-        f" t4.t AS t4,\n"
-        f"           CAST(0 AS BIGINT) AS tape, CAST(8 AS"
-        f" BIGINT) AS head,\n"
-        f"           CAST(0 AS BIGINT) AS st, CAST(0 AS BIGINT)"
-        f" AS halted,\n"
-        f"           CAST(0 AS BIGINT) AS steps\n"
-        f"         FROM cd t1 CROSS JOIN cd t2 CROSS JOIN cd t3"
-        f" CROSS JOIN cd t4)",
-    ]
-    for k in range(1, 9):
-        parts.append(
-            f"m{k} AS (SELECT t1, t2, t3, t4,\n"
-            f"           CASE WHEN halted = 1 THEN tape ELSE\n"
-            f"             tape - sym*p + (code % 2)*p END"
-            f" AS tape,\n"
-            f"           CASE WHEN halted = 1 THEN head ELSE\n"
-            f"             head + 2*((code {d} 2) % 2) - 1 END"
-            f" AS head,\n"
-            f"           CASE WHEN halted = 1 THEN st\n"
-            f"             WHEN code {d} 4 = 2 THEN st\n"
-            f"             ELSE code {d} 4 END AS st,\n"
-            f"           CASE WHEN halted = 1 THEN 1\n"
-            f"             WHEN code {d} 4 = 2 THEN 1 ELSE 0 END"
-            f" AS halted,\n"
-            f"           CASE WHEN halted = 1 THEN steps\n"
-            f"             ELSE steps + 1 END AS steps\n"
-            f"         FROM (SELECT m.*, w.p,\n"
-            f"             (m.tape {d} w.p) % 2 AS sym,\n"
-            f"             CASE m.st*2 + (m.tape {d} w.p) % 2\n"
-            f"               WHEN 0 THEN m.t1 WHEN 1 THEN m.t2\n"
-            f"               WHEN 2 THEN m.t3 ELSE m.t4 END"
-            f" AS code\n"
-            f"           FROM m{k - 1} m JOIN pw w"
-            f" ON w.x = m.head) u(t1, t2, t3, t4, tape, head,"
-            f" st, halted, steps, p, sym, code))")
-    ones = " + ".join(f"(tape {d} {1 << x}) % 2"
-                      for x in range(17))
-    parts.append(
-        f"fin AS{mat} (SELECT t1, t2, t3, t4, halted, steps,\n"
-        f"           CAST({ones} AS BIGINT) AS ones FROM m8)")
-    parts.append(
-        f"agg AS (SELECT\n"
-        f"           CAST(count(*) AS BIGINT) AS n_machines,\n"
-        f"           CAST(sum(halted) AS BIGINT) AS n_halted,\n"
-        f"           CAST(max(CASE WHEN halted = 1 THEN ones"
-        f" END) AS BIGINT) AS sigma2,\n"
-        f"           CAST(max(CASE WHEN halted = 1 THEN steps"
-        f" END) AS BIGINT) AS s2,\n"
-        f"           CAST(sum(CASE WHEN halted = 1 AND"
-        f" ones = 4\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_champions,\n"
-        f"           CAST(sum(CASE WHEN halted = 1 AND"
-        f" steps = 6\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_step_champs\n"
-        f"         FROM fin)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT f.t1, f.t2, f.t3, f.t4, f.steps, f.ones,\n"
-        f"       a.n_machines, a.n_halted, a.sigma2, a.s2,\n"
-        f"       a.n_champions, a.n_step_champs, l.n_docs\n"
-        f"FROM fin f CROSS JOIN agg a CROSS JOIN ld l\n"
-        f"WHERE f.halted = 1 AND f.ones = 4 AND f.steps = 6")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q643_busy_beaver_2",
-       "WITH " + _q643_sql("documents", "//", " MATERIALIZED"))
-def q643(spark, sf_dir):
-    """BB(2): both of Rado's busy-beaver values computed by total
-    exhaustion over the machine space (Rado 1962, Lin-Rado 1965
-    — the uncomputable function at the computable end of its
-    domain; for two states the answer is provable by running
-    everything).  All 12^4 == 20736 two-state two-symbol Turing
-    machines materialize from the doc-residue code dim (each
-    transition slot: write bit, move direction, next state or
-    HALT, packed base-12), and every machine runs EIGHT steps of
-    genuine TM semantics as pure column arithmetic — the tape is
-    a 17-bit integer, the head bit read and rewritten by
-    power-dim div/mod surgery, halted machines frozen.  The
-    aggregates ARE the theorem: among the n_halted == 9784
-    machines that stop, the maximum ones on the tape is
-    sigma2 == 4 and the maximum step count is s2 == 6 — Rado's
-    Sigma(2) and S(2), with two steps of headroom proving no
-    8-step straggler was missed (any 2-state machine running
-    past 6 steps runs forever, a fact this sweep makes finite).
-    The output rows are the champions themselves: the machines
-    achieving 4 ones in 6 steps, transition tables emitted for
-    inspection.  Scale: 20736 independent simulations x 8
-    lockstep steps in one linear chain — batch simulation of a
-    machine SPACE, the q617 shape at its logical extreme."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q643_documents")
-    return spark.sql(
-        "WITH " + _q643_sql("q643_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q644: Cayley's formula — the Prüfer bijection, both directions
-
-
-_Q644_EDGES = [(i, j) for i in range(6) for j in range(i + 1, 6)]
-
-
-def _q644_base(tbl: str) -> str:
-    ev = ", ".join(f"({e}, {a}, {b})" for e, (a, b)
-                   in enumerate(_Q644_EDGES))
-    return (
-        f"n6 AS (SELECT DISTINCT CAST(doc_id % 6 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       eg AS (SELECT CAST(e AS BIGINT) AS e, CAST(a"
-        f" AS BIGINT) AS a,\n"
-        f"           CAST(b AS BIGINT) AS b\n"
-        f"         FROM (VALUES {ev}) t(e, a, b))")
-
-
-def _q644_census() -> list:
-    """Edge 5-subsets + connectivity closure -> the tree census."""
-    parts = ["s1 AS (SELECT e AS e1, CAST(1 AS BIGINT)*0 +"
-             " p2.p AS mask FROM eg\n"
-             "         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-             " CAST(p AS BIGINT) AS p FROM (VALUES "
-             + ", ".join(f"({x}, {1 << x})" for x in range(15))
-             + ") t(x, p)) p2 ON p2.x = e)"]
-    for k in range(2, 6):
-        parts.append(
-            f"s{k} AS (SELECT g.e AS e{k},"
-            f" s.mask + p2.p AS mask\n"
-            f"         FROM s{k - 1} s JOIN eg g"
-            f" ON g.e > s.e{k - 1}\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES "
-            + ", ".join(f"({x}, {1 << x})" for x in range(15))
-            + f") t(x, p)) p2 ON p2.x = g.e)")
-    pe = ("(SELECT CAST(x AS BIGINT) AS x, CAST(p AS BIGINT)"
-          " AS p FROM (VALUES (0, 1), (1, 2), (2, 4), (3, 8), (4, 16), (5, 32), (6, 64), (7, 128), (8, 256), (9, 512), (10, 1024), (11, 2048), (12, 4096), (13, 8192), (14, 16384)) t(x, p))")
-    parts.append(
-        "cb AS (SELECT s.mask, n.x AS u, n.x AS v FROM s5 s\n"
-        "         CROSS JOIN n6 n\n"
-        "         UNION\n"
-        "         SELECT s.mask, g.a, g.b FROM s5 s JOIN eg g"
-        " ON true\n"
-        "         JOIN " + pe + " pe ON pe.x = g.e\n"
-        "           AND (s.mask div pe.p) % 2 = 1\n"
-        "         UNION\n"
-        "         SELECT s.mask, g.b, g.a FROM s5 s JOIN eg g"
-        " ON true\n"
-        "         JOIN " + pe + " pe ON pe.x = g.e\n"
-        "           AND (s.mask div pe.p) % 2 = 1)")
-    prev = "cb"
-    for k in range(1, 4):
-        parts.append(
-            f"cc{k} AS (SELECT DISTINCT t.mask, t.u, t.v FROM (\n"
-            f"         SELECT mask, u, v FROM {prev}\n"
-            f"         UNION ALL\n"
-            f"         SELECT a.mask, a.u, b.v FROM {prev} a\n"
-            f"         JOIN {prev} b ON b.mask = a.mask"
-            f" AND b.u = a.v) t)")
-        prev = f"cc{k}"
-    parts.append(
-        f"tc AS (SELECT mask FROM {prev} WHERE u = 0\n"
-        f"         GROUP BY mask HAVING count(DISTINCT v) = 6)")
-    return parts
-
-
-def _q644_decode(d: str) -> list:
-    """Prüfer sequences -> trees: 4 leaf-attach stages."""
-    parts = [
-        "pz AS (SELECT a.x AS q1, b.x AS q2, c.x AS q3,"
-        " d2.x AS q4,\n"
-        + ",\n".join(
-            f"           CAST(1 + (CASE WHEN a.x = {v} THEN 1"
-            f" ELSE 0 END) + (CASE WHEN b.x = {v} THEN 1 ELSE 0"
-            f" END) + (CASE WHEN c.x = {v} THEN 1 ELSE 0 END) +"
-            f" (CASE WHEN d2.x = {v} THEN 1 ELSE 0 END)"
-            f" AS BIGINT) AS d{v}" for v in range(6)) + ",\n"
-        "           CAST(0 AS BIGINT) AS used,"
-        " CAST(0 AS BIGINT) AS tmask\n"
-        "         FROM n6 a CROSS JOIN n6 b CROSS JOIN n6 c"
-        " CROSS JOIN n6 d2)"]
-    for k in range(1, 5):
-        leaf = "least(" + ", ".join(
-            f"CASE WHEN d{v} = 1 AND (used {d} {1 << v}) % 2 = 0"
-            f" THEN {v} ELSE 99 END" for v in range(6)) + ")"
-        parts.append(
-            f"pz{k} AS (SELECT q1, q2, q3, q4,\n"
-            + ",\n".join(
-                f"           d{v} - (CASE WHEN q{k} = {v} THEN 1"
-                f" ELSE 0 END) AS d{v}" for v in range(6)) + ",\n"
-            f"           used + pw.p AS used,\n"
-            f"           tmask + pe.p AS tmask\n"
-            f"         FROM (SELECT z.*, {leaf} AS lf"
-            f" FROM pz{'' if k == 1 else k - 1} z) y\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES "
-            + ", ".join(f"({x}, {1 << x})" for x in range(6))
-            + f") t(x, p)) pw ON pw.x = y.lf\n"
-            f"         JOIN eg ge ON ge.a = least(y.lf, y.q{k})\n"
-            f"           AND ge.b = greatest(y.lf, y.q{k})\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES "
-            + ", ".join(f"({x}, {1 << x})" for x in range(15))
-            + f") t(x, p)) pe ON pe.x = ge.e)")
-    # final edge joins the two unused vertices
-    lo = "least(" + ", ".join(
-        f"CASE WHEN (used {d} {1 << v}) % 2 = 0 THEN {v}"
-        f" ELSE 99 END" for v in range(6)) + ")"
-    hi = "greatest(" + ", ".join(
-        f"CASE WHEN (used {d} {1 << v}) % 2 = 0 THEN {v}"
-        f" ELSE -1 END" for v in range(6)) + ")"
-    parts.append(
-        f"pzf AS (SELECT y.q1, y.q2, y.q3, y.q4,\n"
-        f"           y.tmask + pe.p AS tmask\n"
-        f"         FROM (SELECT z.*, {lo} AS lo, {hi} AS hi"
-        f" FROM pz4 z) y\n"
-        f"         JOIN eg ge ON ge.a = y.lo AND ge.b = y.hi\n"
-        f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-        f" CAST(p AS BIGINT) AS p FROM (VALUES "
-        + ", ".join(f"({x}, {1 << x})" for x in range(15))
-        + ") t(x, p)) pe ON pe.x = ge.e)")
-    return parts
-
-
-def _q644_final(tbl: str, mat: str) -> str:
-    return (
-        f"cns AS (SELECT CAST(count(*) AS BIGINT) AS n_census\n"
-        f"         FROM tc),\n"
-        f"       prf AS (SELECT\n"
-        f"           CAST(count(*) AS BIGINT) AS n_sequences,\n"
-        f"           CAST(count(DISTINCT tmask) AS BIGINT)"
-        f" AS n_distinct_trees\n"
-        f"         FROM pzf),\n"
-        f"       sbv AS (SELECT CAST(sum(CASE WHEN t.mask IS"
-        f" NULL\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS decode_viol\n"
-        f"         FROM pzf p LEFT JOIN tc t"
-        f" ON t.mask = p.tmask),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT c.n_census, p.n_sequences,"
-        f" p.n_distinct_trees,\n"
-        f"       c.n_census - 1296 AS cayley_resid,\n"
-        f"       p.n_distinct_trees - p.n_sequences"
-        f" AS injective_resid,\n"
-        f"       s.decode_viol,\n"
-        f"       c.n_census - p.n_distinct_trees"
-        f" AS bijection_resid,\n"
-        f"       l.n_docs\n"
-        f"FROM cns c CROSS JOIN prf p CROSS JOIN sbv s\n"
-        f"CROSS JOIN ld l")
-
-
-def _q644_oracle(tbl: str = "documents") -> str:
-    parts = [_q644_base(tbl)]
-    for fr in _q644_census():
-        nm, body = fr.split(" AS ", 1)
-        parts.append(f"{nm} AS MATERIALIZED"
-                     f" {body.strip().replace(' div ', ' // ')}")
-    for fr in _q644_decode("//"):
-        nm, body = fr.split(" AS ", 1)
-        parts.append(f"{nm} AS MATERIALIZED {body.strip()}")
-    parts.append(_q644_final(tbl, " MATERIALIZED"))
-    return "WITH " + ",\n       ".join(parts)
-
-
-@query("q644_cayley_prufer", _q644_oracle())
-def q644(spark, sf_dir):
-    """Cayley's formula with the Prüfer bijection verified in
-    both directions (Cayley 1889, Prüfer 1918 — THE labeled-tree
-    count, and the encoding that makes uniform random spanning
-    trees a one-liner).  Machine one is a CENSUS: all C(15,5) ==
-    3003 edge 5-subsets of K6 enumerate by ascending staged
-    joins (mask-packed), and per-mask connectivity closure (3
-    doubling stages over (mask, u, v) triples — hundreds of
-    graphs closed in one plan) counts exactly n_census == 1296
-    spanning trees: Cayley's n^(n-2) from raw edge subsets.
-    Machine two DECODES: all 6^4 Prüfer sequences run the
-    leaf-attachment algorithm relationally — degrees carried as
-    columns, the minimal available leaf picked by a least-CASE
-    expression, the used-set and the tree's edge mask packed
-    along, the final edge joining the two unused vertices.  The
-    bijection is then checked both ways: every decoded edge set
-    IS a census tree (decode_viol == 0 — well-definedness), the
-    1296 sequences produce 1296 DISTINCT trees
-    (injective_resid == 0), and counts match
-    (bijection_resid == 0) — injective into an equinumerous
-    finite set, hence bijective, every step measured.  Scale:
-    the per-mask closure is the q568 doubling shape batched
-    over thousands of graphs at once — the forest-of-graphs
-    pattern."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q644_documents")
-    base = _q644_base("q644_documents")
-    for tv in ("n6", "eg"):
-        _pin_view(spark, f"WITH {base}\nSELECT * FROM {tv}",
-                  f"q644_{tv}")
-    done = []
-
-    def _qual(text):
-        text = text.replace("FROM eg", "FROM q644_eg") \
-                   .replace("JOIN eg g", "JOIN q644_eg g") \
-                   .replace("JOIN eg ge", "JOIN q644_eg ge") \
-                   .replace("CROSS JOIN n6", "CROSS JOIN q644_n6") \
-                   .replace("FROM n6 a", "FROM q644_n6 a")
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q644_{nm}", text)
-        return text
-
-    # materialize ONLY the multi-referenced stages (s5/cb/cc1/cc2
-    # x3 refs each, tc/pzf x2 in the final) via JVM checkpoints;
-    # the single-reference prefix chains (s1-s4, cc3, pz-pz4) ride
-    # along lazily inside the next checkpoint's WITH — the former
-    # 16 pandas pins of up to 120k rows cost 6.6 s of roundtrips
-    kept: list = []
-    for fr in _q644_census() + _q644_decode("div"):
-        nm, body = fr.split(" AS ", 1)
-        body = _qual(body.strip())
-        if nm in ("s5", "cb", "cc1", "cc2", "tc", "pzf"):
-            dep = (("WITH " + ",\n       ".join(kept) + "\n")
-                   if kept else "")
-            _ckpt_view(spark,
-                       f"{dep}SELECT * FROM {body[:-1]}) q",
-                       f"q644_{nm}")
-            done.append(nm)
-            kept = []
-        else:
-            kept.append(f"{nm} AS {body}")
-    fin = _qual(_q644_final("q644_documents", ""))
-    return spark.sql("WITH " + fin)
-
-
-# ---------------------------------------------------------------------------
-# q645: matrix-tree theorem — Leibniz determinants vs tree censuses
-
-
-_Q645_QE = []
-for _v in range(8):
-    for _b in range(3):
-        _u = _v ^ (1 << _b)
-        if _u > _v:
-            _Q645_QE.append((_v, _u))
-
-
-def _q645_sql(tbl: str, d: str, mat: str) -> str:
-    # Laplacian minors: K6 (rows/cols 1..5) and Q3 (rows/cols 1..7)
-    m6 = ", ".join(f"({i}, {j}, {5 if i == j else -1})"
-                   for i in range(5) for j in range(5))
-    L = [[0] * 8 for _ in range(8)]
-    for a, b in _Q645_QE:
-        L[a][a] += 1
-        L[b][b] += 1
-        L[a][b] -= 1
-        L[b][a] -= 1
-    m8 = ", ".join(f"({i}, {j}, {L[i + 1][j + 1]})"
-                   for i in range(7) for j in range(7))
-    qe = ", ".join(f"({e}, {a}, {b})" for e, (a, b)
-                   in enumerate(_Q645_QE))
-    pe = ("(SELECT CAST(x AS BIGINT) AS x, CAST(p AS BIGINT)"
-          " AS p FROM (VALUES "
-          + ", ".join(f"({x}, {1 << x})" for x in range(12))
-          + ") t(x, p))")
-    parts = [
-        f"n8 AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        f"m6 AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        f" BIGINT) AS j,\n"
-        f"           CAST(v AS BIGINT) AS v FROM (VALUES {m6})"
-        f" t(i, j, v))",
-        f"m8 AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        f" BIGINT) AS j,\n"
-        f"           CAST(v AS BIGINT) AS v FROM (VALUES {m8})"
-        f" t(i, j, v))",
-        f"qe AS (SELECT CAST(e AS BIGINT) AS e, CAST(a AS"
-        f" BIGINT) AS a,\n"
-        f"           CAST(b AS BIGINT) AS b FROM (VALUES {qe})"
-        f" t(e, a, b))",
-    ]
-    # signed permutation-product chains (Leibniz), n = 5 and 7
-    for tag, n, md in (("k", 5, "m6"), ("q", 7, "m8")):
-        parts.append(
-            f"{tag}0 AS (SELECT CAST(0 AS BIGINT) AS vis,\n"
-            f"           CAST(0 AS BIGINT) AS par, CAST(1 AS"
-            f" BIGINT) AS pr\n"
-            f"         FROM n8 WHERE x = 0)")
-        for k in range(1, n + 1):
-            inv = " + ".join(
-                f"(e.vis {d} {1 << v}) % 2"
-                for v in range(1, n)) or "0"
-            # inversions added = used digits greater than c
-            invgt = " + ".join(
-                f"(CASE WHEN {v} > c.x THEN (e.vis {d} {1 << v})"
-                f" % 2 ELSE 0 END)" for v in range(n))
-            parts.append(
-                f"{tag}{k} AS (SELECT e.vis + pw.p AS vis,\n"
-                f"           (e.par + {invgt}) % 2 AS par,\n"
-                f"           e.pr * m.v AS pr\n"
-                f"         FROM {tag}{k - 1} e\n"
-                f"         JOIN n8 c ON c.x < {n}\n"
-                f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-                f" CAST(p AS BIGINT) AS p FROM (VALUES "
-                + ", ".join(f"({x}, {1 << x})" for x in range(7))
-                + f") t(x, p)) pw ON pw.x = c.x\n"
-                f"         JOIN {md} m ON m.i = {k - 1}"
-                f" AND m.j = c.x\n"
-                f"         WHERE (e.vis {d} pw.p) % 2 = 0)")
-        parts.append(
-            f"{tag}det AS (SELECT CAST(sum(CASE WHEN par = 0"
-            f" THEN pr\n"
-            f"           ELSE -pr END) AS BIGINT) AS det\n"
-            f"         FROM {tag}{n})")
-    # Q3 spanning-tree census: 7-subsets of 12 edges + closure
-    parts.append(
-        "t1 AS (SELECT e AS e1, pe.p AS mask FROM qe\n"
-        "         JOIN " + pe + " pe ON pe.x = e)")
-    for k in range(2, 8):
-        parts.append(
-            f"t{k} AS (SELECT g.e AS e{k}, s.mask + pe.p"
-            f" AS mask\n"
-            f"         FROM t{k - 1} s JOIN qe g"
-            f" ON g.e > s.e{k - 1}\n"
-            f"         JOIN " + pe + " pe ON pe.x = g.e)")
-    parts.append(
-        "qb AS (SELECT s.mask, n.x AS u, n.x AS v FROM t7 s\n"
-        "         CROSS JOIN n8 n\n"
-        "         UNION\n"
-        "         SELECT s.mask, g.a, g.b FROM t7 s JOIN qe g"
-        " ON true\n"
-        "         JOIN " + pe + " pe ON pe.x = g.e\n"
-        "           AND (s.mask div pe.p) % 2 = 1\n"
-        "         UNION\n"
-        "         SELECT s.mask, g.b, g.a FROM t7 s JOIN qe g"
-        " ON true\n"
-        "         JOIN " + pe + " pe ON pe.x = g.e\n"
-        "           AND (s.mask div pe.p) % 2 = 1)")
-    prev = "qb"
-    for k in range(1, 4):
-        parts.append(
-            f"qc{k} AS (SELECT DISTINCT t.mask, t.u, t.v FROM (\n"
-            f"         SELECT mask, u, v FROM {prev}\n"
-            f"         UNION ALL\n"
-            f"         SELECT a.mask, a.u, b.v FROM {prev} a\n"
-            f"         JOIN {prev} b ON b.mask = a.mask"
-            f" AND b.u = a.v) t)")
-        prev = f"qc{k}"
-    parts.append(
-        f"qct AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS q3_census FROM (\n"
-        f"         SELECT mask FROM {prev} WHERE u = 0\n"
-        f"         GROUP BY mask HAVING count(DISTINCT v) = 8)"
-        f" t)")
-    parts.append(
-        f"cay AS (SELECT CAST(count(*)*count(*)*count(*)*"
-        f"count(*)\n"
-        f"           AS BIGINT) AS k6_closed\n"
-        f"         FROM (SELECT DISTINCT x % 6 FROM n8) t)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT kd.det AS k6_det, c.k6_closed,\n"
-        f"       kd.det - c.k6_closed AS k6_resid,\n"
-        f"       qd.det AS q3_det, t.q3_census,\n"
-        f"       qd.det - t.q3_census AS q3_resid,\n"
-        f"       l.n_docs\n"
-        f"FROM kdet kd CROSS JOIN qdet qd CROSS JOIN qct t\n"
-        f"CROSS JOIN cay c CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q645_oracle(tbl: str = "documents") -> str:
-    parts, fin = _q645_sql(tbl, "//", " MATERIALIZED")
-    out = []
-    for fr in parts:
-        nm, body = fr.split(" AS ", 1)
-        out.append(f"{nm} AS MATERIALIZED"
-                   f" {body.strip().replace(' div ', ' // ')}")
-    return "WITH " + ",\n       ".join(out) + "\n" + fin
-
-
-@query("q645_matrix_tree", _q645_oracle())
-def q645(spark, sf_dir):
-    """Kirchhoff's matrix-tree theorem — Leibniz determinants by
-    permutation exhaustion against spanning-tree censuses
-    (Kirchhoff 1847; the determinant that counts trees, and the
-    reason effective resistance knows about connectivity).  Two
-    graphs, two machines each.  The determinants are computed by
-    the DEFINITION: signed permutation sums, with each
-    permutation enumerated by the prefix-extension chain carrying
-    its inversion PARITY incrementally (inversions added = used
-    digits greater than the new one, a bit-extraction sum — no
-    sorting, no recursion) and its matrix-entry PRODUCT
-    accumulated one join per stage — 120 terms for the K6
-    Laplacian minor, 5040 for the cube graph Q3's.  Machine two
-    for K6 is Cayley's closed form with n MEASURED (k6_closed ==
-    count(dim)^4), and for Q3 a full census: all C(12,7) == 792
-    edge 7-subsets, per-mask connectivity closure (the q644
-    forest-of-graphs doubling), q3_census == 384 spanning trees.
-    k6_resid == 0 (det 1296 == 6^4) and q3_resid == 0 (det 384
-    == census) are the theorem at two structurally different
-    graphs — one where a formula exists, one where only the
-    determinant or brute force will do, and they agree with
-    both.  Scale: the Leibniz sum is exponential and exists to
-    certify; the determinant a real system would compute by
-    elimination is CHECKED here against its own definition."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q645_documents")
-    parts, fin = _q645_sql("q645_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        text = text.replace("FROM n8", "FROM q645_n8") \
-                   .replace("JOIN n8", "JOIN q645_n8") \
-                   .replace("FROM qe", "FROM q645_qe") \
-                   .replace("JOIN qe g", "JOIN q645_qe g") \
-                   .replace("JOIN m6 m", "JOIN q645_m6 m") \
-                   .replace("JOIN m8 m", "JOIN q645_m8 m")
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q645_{nm}", text)
-        return text
-
-    # materialize ONLY the multi-referenced stages (t7/qb/qc1/qc2,
-    # x3 refs each) — the Leibniz determinant chains (k*, q*) and
-    # the tree-census tail are single-reference and ride lazily in
-    # the next checkpoint's WITH / the final statement (q644's
-    # count-references discipline; formerly 30 pandas pins, 5.8 s)
-    kept: list = []
-    for fr in parts:
-        nm, body = fr.split(" AS ", 1)
-        if nm in ("n8", "m6", "m8", "qe"):
-            _pin_view(spark, body.strip()[1:-1].replace(
-                "FROM {tbl}", ""), f"q645_{nm}")
-            continue
-        body = _qual(body.strip())
-        if nm in ("t7", "qb", "qc1", "qc2"):
-            # kept stays cumulative: earlier lazy chains (kdet,
-            # qdet) are consumed by the FINAL, not by these
-            # checkpoints — unreferenced CTEs are pruned
-            dep = (("WITH " + ",\n       ".join(kept) + "\n")
-                   if kept else "")
-            _ckpt_view(spark,
-                       f"{dep}SELECT * FROM {body[:-1]}) q",
-                       f"q645_{nm}")
-            done.append(nm)
-        else:
-            kept.append(f"{nm} AS {body}")
-    fin = _qual(fin)
-    return spark.sql("WITH " + ",\n       ".join(kept) + "\n"
-                     + fin)
-
-
-# ---------------------------------------------------------------------------
-# q646: Dedekind M(4), Sperner, and LYM — the Boolean lattice census
-
-
-def _q646_sql(tbl: str, d: str, mat: str) -> str:
-    j16 = " CROSS JOIN ".join(f"bd b{i}" for i in range(16))
-    fam = " + ".join(f"b{i}.x*{1 << i}" for i in range(16))
-    pc = lambda e: " + ".join(f"(({e}) {d} {1 << k}) % 2"
-                              for k in range(4))
-    contain = " AND ".join(
-        f"(a.s {d} {1 << k}) % 2 <= (b.s {d} {1 << k}) % 2"
-        for k in range(4))
-    return (
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       sd AS (SELECT CAST(s AS BIGINT) AS s FROM"
-        f" (VALUES "
-        + ", ".join(f"({s})" for s in range(16)) + ") t(s)),\n"
-        f"       pw AS (SELECT CAST(x AS BIGINT) AS x, CAST(p"
-        f" AS BIGINT) AS p FROM (VALUES "
-        + ", ".join(f"({x}, {1 << x})" for x in range(16))
-        + ") t(x, p)),\n"
-        # strict containment pairs a < b in the subset order
-        f"       cp AS{mat} (SELECT a.s AS a, b.s AS b\n"
-        f"         FROM sd a JOIN sd b ON a.s <> b.s\n"
-        f"         WHERE {contain}),\n"
-        f"       fm AS{mat} (SELECT {fam} AS f FROM {j16}),\n"
-        # a family is an antichain iff it contains no cp pair
-        f"       ac AS{mat} (SELECT f.f FROM fm f\n"
-        f"         LEFT JOIN (SELECT c.a, c.b, pa.p AS qa,"
-        f" pb.p AS qb\n"
-        f"           FROM cp c JOIN pw pa ON pa.x = c.a\n"
-        f"           JOIN pw pb ON pb.x = c.b) c2\n"
-        f"           ON (f.f {d} c2.qa) % 2 = 1"
-        f" AND (f.f {d} c2.qb) % 2 = 1\n"
-        f"         GROUP BY f.f HAVING count(c2.a) = 0),\n"
-        f"       mem AS{mat} (SELECT a.f, s.s,\n"
-        f"           CAST({pc('s.s')} AS BIGINT) AS sz\n"
-        f"         FROM ac a JOIN sd s ON true\n"
-        f"         JOIN pw p2 ON p2.x = s.s\n"
-        f"           AND (a.f {d} p2.p) % 2 = 1),\n"
-        f"       per AS{mat} (SELECT a.f,\n"
-        f"           CAST(coalesce(count(m.s), 0) AS BIGINT)"
-        f" AS size,\n"
-        f"           CAST(coalesce(sum(CASE m.sz WHEN 0 THEN 12\n"
-        f"             WHEN 1 THEN 3 WHEN 2 THEN 2 WHEN 3 THEN 3"
-        f"\n"
-        f"             ELSE 12 END), 0) AS BIGINT) AS lym12\n"
-        f"         FROM ac a LEFT JOIN mem m ON m.f = a.f\n"
-        f"         GROUP BY a.f),\n"
-        f"       agg AS (SELECT\n"
-        f"           CAST(count(*) AS BIGINT) AS m4,\n"
-        f"           CAST(max(size) AS BIGINT) AS sperner_max,\n"
-        f"           CAST(sum(CASE WHEN size = 6 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_maximum,\n"
-        f"           CAST(sum(CASE WHEN lym12 > 12 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS lym_viol\n"
-        f"         FROM per),\n"
-        f"       mid AS (SELECT CAST(sum(p2.p) AS BIGINT) AS m\n"
-        f"         FROM sd s JOIN pw p2 ON p2.x = s.s\n"
-        f"         WHERE {pc('s.s')} = 2),\n"
-        f"       mxf AS (SELECT CAST(max(f) AS BIGINT) AS f\n"
-        f"         FROM per WHERE size = 6),\n"
-        f"       hist AS{mat} (SELECT size,"
-        f" CAST(count(*) AS BIGINT) AS n\n"
-        f"         FROM per GROUP BY size),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT h.size, h.n,\n"
-        f"       a.m4, a.sperner_max, a.n_maximum, a.lym_viol,\n"
-        f"       x.f - i.m AS middle_layer_resid, l.n_docs\n"
-        f"FROM hist h CROSS JOIN agg a CROSS JOIN mxf x\n"
-        f"CROSS JOIN mid i CROSS JOIN ld l")
-
-
-@query("q646_dedekind_sperner",
-       "WITH " + _q646_sql("documents", "//", " MATERIALIZED"))
-def q646(spark, sf_dir):
-    """Dedekind's M(4), Sperner's theorem, and the LYM inequality
-    — the Boolean-lattice trinity by one exhaustive sweep
-    (Dedekind 1897, Sperner 1928, Lubell-Yamamoto-Meshalkin; the
-    lattice q625 did inclusion-exclusion on, now counted as a
-    whole).  All 2^16 families of subsets of a 4-set materialize
-    from the parity dim; a family is an antichain iff it
-    contains none of the 65 strict-containment pairs (bit-order
-    comparison dim, membership by power div/mod) — and exactly
-    M(4) == 168 survive: a DEDEKIND NUMBER computed by raw
-    enumeration, the sequence famous for resisting computation
-    (M(9) took until 2023).  Sperner's theorem lands as
-    aggregates over those 168: the largest antichain has
-    sperner_max == 6 == C(4,2) members, is attained EXACTLY once
-    (n_maximum == 1), and the unique maximum is literally the
-    middle layer (middle_layer_resid == 0 against the computed
-    layer mask).  The LYM inequality — sum over an antichain of
-    1/C(4,|A|) <= 1 — is verified for EVERY antichain as the
-    exact integer bound sum(12/C(4,|A|)) <= 12 (lym_viol == 0
-    over all 168; LYM is the standard proof OF Sperner, here
-    checked independently).  The antichain size histogram is the
-    output.  Scale: enumerate-filter-aggregate over a generated
-    dim; the containment-pair join is broadcast-size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q646_documents")
-    return spark.sql(
-        "WITH " + _q646_sql("q646_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q647: Erdős–Ko–Rado — intersecting families via the Petersen graph
-
-
-def _q647_sql(tbl: str, d: str, mat: str) -> str:
-    import itertools as _it
-    pairs = list(_it.combinations(range(5), 2))
-    pv = ", ".join(f"({i}, {a}, {b})" for i, (a, b)
-                   in enumerate(pairs))
-    dis = [(i, j) for i in range(10) for j in range(i + 1, 10)
-           if not (set(pairs[i]) & set(pairs[j]))]
-    dv = ", ".join(f"({i}, {j})" for i, j in dis)
-    j10 = " CROSS JOIN ".join(f"bd b{i}" for i in range(10))
-    fam = " + ".join(f"b{i}.x*{1 << i}" for i in range(10))
-    return (
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       pr AS (SELECT CAST(i AS BIGINT) AS i, CAST(a"
-        f" AS BIGINT) AS a,\n"
-        f"           CAST(b AS BIGINT) AS b FROM (VALUES {pv})"
-        f" t(i, a, b)),\n"
-        f"       dj AS (SELECT CAST(i AS BIGINT) AS i, CAST(j"
-        f" AS BIGINT) AS j\n"
-        f"         FROM (VALUES {dv}) t(i, j)),\n"
-        f"       pw AS (SELECT CAST(x AS BIGINT) AS x, CAST(p"
-        f" AS BIGINT) AS p FROM (VALUES "
-        + ", ".join(f"({x}, {1 << x})" for x in range(10))
-        + ") t(x, p)),\n"
-        # Petersen structure: 15 disjointness edges, 3-regular
-        f"       pet AS (SELECT\n"
-        f"           CAST((SELECT count(*) FROM dj) AS BIGINT)"
-        f" AS n_edges,\n"
-        f"           CAST(min(t.deg) AS BIGINT) AS min_deg,\n"
-        f"           CAST(max(t.deg) AS BIGINT) AS max_deg\n"
-        f"         FROM (SELECT v, count(*) AS deg FROM (\n"
-        f"           SELECT i AS v FROM dj UNION ALL"
-        f" SELECT j FROM dj) u\n"
-        f"           GROUP BY v) t),\n"
-        f"       fm AS{mat} (SELECT {fam} AS f FROM {j10}),\n"
-        # intersecting family == independent set in Petersen
-        f"       iv AS{mat} (SELECT f.f FROM fm f\n"
-        f"         LEFT JOIN (SELECT d2.i, d2.j, pa.p AS qa,\n"
-        f"             pb.p AS qb FROM dj d2\n"
-        f"           JOIN pw pa ON pa.x = d2.i\n"
-        f"           JOIN pw pb ON pb.x = d2.j) e\n"
-        f"           ON (f.f {d} e.qa) % 2 = 1"
-        f" AND (f.f {d} e.qb) % 2 = 1\n"
-        f"         GROUP BY f.f HAVING count(e.i) = 0),\n"
-        f"       sz AS{mat} (SELECT f,\n"
-        f"           CAST({' + '.join(f'(f {d} {1 << k}) % 2' for k in range(10))}"
-        f" AS BIGINT) AS size FROM iv),\n"
-        f"       agg AS (SELECT\n"
-        f"           CAST(count(*) AS BIGINT)"
-        f" AS n_intersecting,\n"
-        f"           CAST(max(size) AS BIGINT) AS ekr_max,\n"
-        f"           CAST(sum(CASE WHEN size = 4 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_maximum FROM sz),\n"
-        # every maximum family is a STAR: some element in all
-        f"       st AS (SELECT CAST(sum(CASE WHEN t.star = 0\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS nonstar_max FROM (\n"
-        f"           SELECT s.f, max(CASE WHEN miss.n = 0"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS star\n"
-        f"           FROM sz s CROSS JOIN (SELECT DISTINCT a"
-        f" AS e FROM pr\n"
-        f"             UNION SELECT DISTINCT b FROM pr) el\n"
-        f"           JOIN (SELECT s2.f, el2.e,\n"
-        f"               CAST(sum(CASE WHEN (s2.f {d} pw.p) % 2"
-        f" = 1\n"
-        f"                 AND p2.a <> el2.e AND p2.b <> el2.e\n"
-        f"                 THEN 1 ELSE 0 END) AS BIGINT) AS n\n"
-        f"             FROM sz s2 CROSS JOIN (SELECT DISTINCT a"
-        f" AS e FROM pr\n"
-        f"               UNION SELECT DISTINCT b FROM pr) el2\n"
-        f"             JOIN pr p2 ON true\n"
-        f"             JOIN pw ON pw.x = p2.i\n"
-        f"             WHERE s2.size = 4\n"
-        f"             GROUP BY s2.f, el2.e) miss\n"
-        f"             ON miss.f = s.f AND miss.e = el.e\n"
-        f"           WHERE s.size = 4 GROUP BY s.f) t),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT a.n_intersecting, a.ekr_max, a.n_maximum,\n"
-        f"       s.nonstar_max, p.n_edges, p.min_deg,"
-        f" p.max_deg,\n"
-        f"       l.n_docs\n"
-        f"FROM agg a CROSS JOIN st s CROSS JOIN pet p\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q647_erdos_ko_rado",
-       "WITH " + _q647_sql("documents", "//", " MATERIALIZED"))
-def q647(spark, sf_dir):
-    """Erdős–Ko–Rado for 2-subsets of a 5-set, which is exactly
-    the maximum-independent-set problem on the PETERSEN graph —
-    solved by exhaustion with the uniqueness half verified (EKR
-    1961; the intersecting-family bound under any 'no two
-    disjoint shards' constraint, wearing graph theory's most
-    famous counterexample machine as its skin).  The 10 edges of
-    K5 are the vertices; their 15 disjointness pairs form the
-    Petersen graph (n_edges == 15, min_deg == max_deg == 3 —
-    3-regularity measured), and a family of 2-sets is
-    intersecting iff it is INDEPENDENT in that graph.  All 2^10
-    families sweep through the independence filter; the EKR
-    bound lands exactly: ekr_max == 4 == C(n-1, k-1), with
-    n_maximum == 5 maximum families — and the uniqueness theorem
-    (for n > 2k every maximum family is a STAR) is checked
-    family by family: each of the five fixes a common element
-    through all its members (nonstar_max == 0), one star per
-    ground element.  So alpha(Petersen) == 4 with exactly 5
-    maximum independent sets — two classical facts, one
-    computation.  Scale: enumerate-filter over a generated dim
-    with broadcast structure dims; the star audit is a grouped
-    membership join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q647_documents")
-    return spark.sql(
-        "WITH " + _q647_sql("q647_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q648: Mantel/Turán by exhaustion — extremal graphs characterized
-
-
-_Q648_TRIS = '(1, 2, 32), (1, 4, 64), (1, 8, 128), (1, 16, 256), (2, 4, 512), (2, 8, 1024), (2, 16, 2048), (4, 8, 4096), (4, 16, 8192), (8, 16, 16384), (32, 64, 512), (32, 128, 1024), (32, 256, 2048), (64, 128, 4096), (64, 256, 8192), (128, 256, 16384), (512, 1024, 4096), (512, 2048, 8192), (1024, 2048, 16384), (4096, 8192, 16384)'
-_Q648_DEGW = '(0, 1), (0, 2), (0, 4), (0, 8), (0, 16), (1, 1), (1, 32), (1, 64), (1, 128), (1, 256), (2, 2), (2, 32), (2, 512), (2, 1024), (2, 2048), (3, 4), (3, 64), (3, 512), (3, 4096), (3, 8192), (4, 8), (4, 128), (4, 1024), (4, 4096), (4, 16384), (5, 16), (5, 256), (5, 2048), (5, 8192), (5, 16384)'
-
-
-def _q648_sql(tbl: str, d: str, mat: str) -> str:
-    j15 = " CROSS JOIN ".join(f"bd b{i}" for i in range(15))
-    msk = " + ".join(f"b{i}.x*{1 << i}" for i in range(15))
-    pc = " + ".join(f"(f.m {d} {1 << k}) % 2"
-                    for k in range(15))
-    pcc = " + ".join(f"((32767 - x.m) {d} {1 << k}) % 2"
-                     for k in range(15))
-    return (
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       tr AS (SELECT CAST(a AS BIGINT) AS a, CAST(b"
-        f" AS BIGINT) AS b,\n"
-        f"           CAST(c AS BIGINT) AS c FROM (VALUES"
-        f" {_Q648_TRIS}) t(a, b, c)),\n"
-        f"       dg AS (SELECT CAST(v AS BIGINT) AS v, CAST(w"
-        f" AS BIGINT) AS w\n"
-        f"         FROM (VALUES {_Q648_DEGW}) t(v, w)),\n"
-        f"       gm AS{mat} (SELECT {msk} AS m"
-        f" FROM {j15}),\n"
-        f"       tf AS{mat} (SELECT g.m FROM gm g\n"
-        f"         LEFT JOIN tr t ON (g.m {d} t.a) % 2 = 1\n"
-        f"           AND (g.m {d} t.b) % 2 = 1"
-        f" AND (g.m {d} t.c) % 2 = 1\n"
-        f"         GROUP BY g.m HAVING count(t.a) = 0),\n"
-        f"       sz AS{mat} (SELECT f.m,"
-        f" CAST({pc} AS BIGINT) AS ne\n"
-        f"         FROM tf f),\n"
-        f"       agg AS (SELECT\n"
-        f"           CAST(count(*) AS BIGINT)"
-        f" AS n_triangle_free,\n"
-        f"           CAST(max(ne) AS BIGINT) AS mantel_max,\n"
-        f"           CAST(sum(CASE WHEN ne = 9 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_extremal FROM sz),\n"
-        f"       ext AS{mat} (SELECT x.m,\n"
-        f"           CAST({pcc} AS BIGINT) AS comp_edges,\n"
-        f"           CAST((SELECT count(*) FROM tr t WHERE\n"
-        f"             ((32767 - x.m) {d} t.a) % 2 = 1 AND\n"
-        f"             ((32767 - x.m) {d} t.b) % 2 = 1 AND\n"
-        f"             ((32767 - x.m) {d} t.c) % 2 = 1)"
-        f" AS BIGINT) AS comp_tris\n"
-        f"         FROM sz x WHERE x.ne = 9),\n"
-        f"       exd AS (SELECT CAST(sum(CASE WHEN t.bad > 0\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS comp_deg_viol FROM (\n"
-        f"           SELECT e.m, max(CASE WHEN dd.cd <> 2"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS bad\n"
-        f"           FROM ext e JOIN (SELECT e2.m, g2.v,\n"
-        f"               CAST(sum(((32767 - e2.m) {d} g2.w)"
-        f" % 2) AS BIGINT) AS cd\n"
-        f"             FROM ext e2 JOIN dg g2 ON true\n"
-        f"             GROUP BY e2.m, g2.v) dd"
-        f" ON dd.m = e.m\n"
-        f"           GROUP BY e.m) t),\n"
-        f"       exv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN comp_edges <> 6 OR\n"
-        f"             comp_tris <> 2 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS comp_viol FROM ext),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT a.n_triangle_free, a.mantel_max,"
-        f" a.n_extremal,\n"
-        f"       a.mantel_max - 9 AS turan_resid,\n"
-        f"       v.comp_viol, x2.comp_deg_viol, l.n_docs\n"
-        f"FROM agg a CROSS JOIN exv v CROSS JOIN exd x2\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q648_mantel_turan",
-       "WITH " + _q648_sql("documents", "//", " MATERIALIZED"))
-def q648(spark, sf_dir):
-    """Mantel's theorem with the extremal graphs characterized,
-    all by exhaustion (Mantel 1907, Turán 1941 — the founding
-    theorem of extremal graph theory: the densest triangle-free
-    graph is the balanced complete bipartite one).  All 2^15
-    graphs on 6 labeled vertices sweep through the 20-triangle
-    dim; among the n_triangle_free survivors the maximum edge
-    count is EXACTLY 9 == floor(36/4) (turan_resid == 0 — the
-    Turán bound met, not just bounded), attained by n_extremal
-    == 10 graphs.  The uniqueness half is then verified
-    structurally on every winner: each extremal graph's
-    COMPLEMENT has 6 edges, exactly 2 triangles, and is
-    2-regular at every vertex (comp_viol == 0,
-    comp_deg_viol == 0) — which forces two disjoint K3s, i.e.
-    the original graph is K_{3,3}, and 10 is precisely the
-    number of 3-3 vertex splits — the complete extremal
-    characterization, measured.  The correlated comp_tris
-    subquery is a projection-position scalar (Spark-legal,
-    unlike the q644 join-condition form).  Scale:
-    enumerate-filter-aggregate with broadcast structure dims —
-    the q630 Ramsey machinery pointed at the other classical
-    question."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q648_documents")
-    return spark.sql(
-        "WITH " + _q648_sql("q648_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q649: Seven Bridges of Königsberg — Euler's 1736 theorem, computed
-
-
-_Q649_KB = [(0, 0, 1), (1, 0, 1), (2, 0, 2), (3, 0, 2),
-            (4, 0, 3), (5, 1, 3), (6, 2, 3)]
-
-
-def _q649_sql(tbl: str, d: str, mat: str) -> str:
-    # gid 1: the 1736 multigraph; gid 2: one (0,1) bridge removed
-    ev = []
-    for k, a, b in _Q649_KB:
-        ev.append(f"(1, {k}, {a}, {b})")
-    for k, a, b in _Q649_KB[1:]:
-        ev.append(f"(2, {k - 1}, {a}, {b})")
-    edges = ", ".join(ev)
-    parts = [
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 4 AS BIGINT)"
-        f" AS v FROM {tbl})",
-        f"eg AS (SELECT CAST(g AS BIGINT) AS g, CAST(k AS"
-        f" BIGINT) AS k,\n"
-        f"           CAST(a AS BIGINT) AS a, CAST(b AS BIGINT)"
-        f" AS b\n"
-        f"         FROM (VALUES {edges}) t(g, k, a, b))",
-        f"pw AS (SELECT CAST(x AS BIGINT) AS x, CAST(p AS"
-        f" BIGINT) AS p FROM (VALUES "
-        + ", ".join(f"({x}, {1 << x})" for x in range(7))
-        + ") t(x, p))",
-        f"egp AS (SELECT e.g, e.k, e.a, e.b, p2.p FROM eg e\n"
-        f"         JOIN pw p2 ON p2.x = e.k)",
-        f"fm AS (SELECT CAST(g AS BIGINT) AS g, CAST(full_m AS"
-        f" BIGINT) AS full_m\n"
-        f"         FROM (VALUES (1, 127), (2, 63)) t(g,"
-        f" full_m))",
-        "w0 AS (SELECT e.g, n.v AS s0, n.v AS cur,\n"
-        "           CAST(0 AS BIGINT) AS used\n"
-        "         FROM (SELECT DISTINCT g FROM eg) e"
-        " CROSS JOIN nd n)",
-    ]
-    for k in range(1, 8):
-        parts.append(
-            f"w{k} AS (SELECT w.g, w.s0,\n"
-            f"           CASE WHEN f.full_m = w.used THEN w.cur\n"
-            f"             WHEN e.a = w.cur THEN e.b"
-            f" ELSE e.a END AS cur,\n"
-            f"           CASE WHEN f.full_m = w.used THEN"
-            f" w.used\n"
-            f"             ELSE w.used + e.p END AS used\n"
-            f"         FROM w{k - 1} w\n"
-            f"         JOIN fm f ON f.g = w.g\n"
-            f"         LEFT JOIN egp e ON e.g = w.g\n"
-            f"           AND (w.used {d} e.p) % 2 = 0\n"
-            f"           AND (e.a = w.cur OR e.b = w.cur)\n"
-            f"           AND f.full_m <> w.used\n"
-            f"         WHERE f.full_m = w.used"
-            f" OR e.k IS NOT NULL)")
-    parts.append(
-        f"tr AS{mat} (SELECT w.g, w.s0, w.cur FROM w7 w\n"
-        f"         JOIN fm f ON f.g = w.g"
-        f" AND f.full_m = w.used)")
-    parts.append(
-        "dgs AS (SELECT g, v, CAST(count(*) AS BIGINT) AS deg"
-        " FROM (\n"
-        "         SELECT g, a AS v FROM eg UNION ALL"
-        " SELECT g, b FROM eg) t\n"
-        "         GROUP BY g, v)")
-    parts.append(
-        "odd AS (SELECT g, CAST(sum(deg % 2) AS BIGINT)"
-        " AS n_odd FROM dgs GROUP BY g)")
-    parts.append(
-        f"cnt AS (SELECT g, CAST(count(*) AS BIGINT)"
-        f" AS n_trails FROM tr GROUP BY g)")
-    parts.append(
-        f"ep AS (SELECT CAST(sum(CASE WHEN ds.deg % 2 = 0 OR\n"
-        f"           de.deg % 2 = 0 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS endpoint_viol,\n"
-        f"           CAST(count(DISTINCT t.s0*4 + t.cur)"
-        f" AS BIGINT) AS n_endpoint_pairs\n"
-        f"         FROM tr t JOIN dgs ds ON ds.g = t.g"
-        f" AND ds.v = t.s0\n"
-        f"         JOIN dgs de ON de.g = t.g"
-        f" AND de.v = t.cur\n"
-        f"         WHERE t.g = 2)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT o.g, o.n_odd, coalesce(c.n_trails, 0)"
-        f" AS n_trails,\n"
-        f"       e.endpoint_viol, e.n_endpoint_pairs,"
-        f" l.n_docs\n"
-        f"FROM odd o LEFT JOIN cnt c ON c.g = o.g\n"
-        f"CROSS JOIN ep e CROSS JOIN ld l")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q649_konigsberg",
-       "WITH " + _q649_sql("documents", "//", " MATERIALIZED"))
-def q649(spark, sf_dir):
-    """The Seven Bridges of Königsberg — graph theory's founding
-    impossibility, settled by exhaustive walk enumeration, beside
-    its repaired twin (Euler 1736; the degree-parity criterion
-    every pipeline-traversal planner inherits).  Both multigraphs
-    — the original seven bridges and the city with one
-    Pregel bridge removed — run through the SAME staged trail
-    search: partial walks extend by any unused incident edge
-    (edge-multiset membership packed in a used-mask, seven
-    stages, completed walks frozen via the per-graph full mask).
-    The counts are the theorem: the 1736 graph has n_odd == 4
-    odd-degree land masses and exactly n_trails == 0 Euler
-    trails — the impossibility Euler argued abstractly, here
-    established by enumerating every candidate walk to
-    extinction; the repaired graph has n_odd == 2 and n_trails
-    == 32, and every one of those trails starts and ends at the
-    two odd vertices (endpoint_viol == 0, exactly
-    n_endpoint_pairs == 2 ordered endpoint pairs) — the
-    endpoints half of Euler's theorem verified on every witness
-    rather than asserted.  Scale: staged frontier expansion with
-    freeze-on-completion is the q623 BFS-enumeration shape; the
-    walk space stays bounded because used-masks prune."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q649_documents")
-    return spark.sql(
-        "WITH " + _q649_sql("q649_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q650: domino tilings — Aztec diamonds and the Fibonacci strip
-
-
-_Q650_CELLS = open if False else None
-_Q650_CELLS = """(1, 0, 1, 3, 8, 1, 2), (1, 1, 2, 4, 16, -1, 0), (1, 2, 4, 7, 128, 3, 8), (1, 3, 8, 8, 256, 4, 16), (1, 4, 16, 9, 512, 5, 32), (1, 5, 32, 10, 1024, -1, 0), (1, 6, 64, 12, 4096, 7, 128), (1, 7, 128, 13, 8192, 8, 256), (1, 8, 256, 14, 16384, 9, 512), (1, 9, 512, 15, 32768, 10, 1024), (1, 10, 1024, 16, 65536, 11, 2048), (1, 11, 2048, 17, 131072, -1, 0), (1, 12, 4096, -1, 0, 13, 8192), (1, 13, 8192, 18, 262144, 14, 16384), (1, 14, 16384, 19, 524288, 15, 32768), (1, 15, 32768, 20, 1048576, 16, 65536), (1, 16, 65536, 21, 2097152, 17, 131072), (1, 17, 131072, -1, 0, -1, 0), (1, 18, 262144, -1, 0, 19, 524288), (1, 19, 524288, 22, 4194304, 20, 1048576), (1, 20, 1048576, 23, 8388608, 21, 2097152), (1, 21, 2097152, -1, 0, -1, 0), (1, 22, 4194304, -1, 0, 23, 8388608), (1, 23, 8388608, -1, 0, -1, 0), (2, 0, 1, 2, 4, 1, 2), (2, 1, 2, 3, 8, -1, 0), (2, 2, 4, 4, 16, 3, 8), (2, 3, 8, 5, 32, -1, 0), (2, 4, 16, 6, 64, 5, 32), (2, 5, 32, 7, 128, -1, 0), (2, 6, 64, 8, 256, 7, 128), (2, 7, 128, 9, 512, -1, 0), (2, 8, 256, 10, 1024, 9, 512), (2, 9, 512, 11, 2048, -1, 0), (2, 10, 1024, 12, 4096, 11, 2048), (2, 11, 2048, 13, 8192, -1, 0), (2, 12, 4096, 14, 16384, 13, 8192), (2, 13, 8192, 15, 32768, -1, 0), (2, 14, 16384, 16, 65536, 15, 32768), (2, 15, 32768, 17, 131072, -1, 0), (2, 16, 65536, 18, 262144, 17, 131072), (2, 17, 131072, 19, 524288, -1, 0), (2, 18, 262144, -1, 0, 19, 524288), (2, 19, 524288, -1, 0, -1, 0), (3, 0, 1, 3, 8, 1, 2), (3, 1, 2, 4, 16, -1, 0), (3, 2, 4, 6, 64, 3, 8), (3, 3, 8, 7, 128, 4, 16), (3, 4, 16, 8, 256, 5, 32), (3, 5, 32, 9, 512, -1, 0), (3, 6, 64, -1, 0, 7, 128), (3, 7, 128, 10, 1024, 8, 256), (3, 8, 256, 11, 2048, 9, 512), (3, 9, 512, -1, 0, -1, 0), (3, 10, 1024, -1, 0, 11, 2048), (3, 11, 2048, -1, 0, -1, 0)"""
-_Q650_FULL = {1: (1 << 24) - 1, 2: (1 << 20) - 1,
-              3: (1 << 12) - 1}
-
-
-def _q650_sql(tbl: str, d: str, mat: str):
-    fm = ", ".join(f"({r}, {m})" for r, m in _Q650_FULL.items())
-    parts = [
-        f"cl AS (SELECT CAST(r AS BIGINT) AS r, CAST(i AS"
-        f" BIGINT) AS i,\n"
-        f"           CAST(p AS BIGINT) AS p, CAST(rn AS BIGINT)"
-        f" AS rn,\n"
-        f"           CAST(rp AS BIGINT) AS rp, CAST(bn AS"
-        f" BIGINT) AS bn,\n"
-        f"           CAST(bp AS BIGINT) AS bp\n"
-        f"         FROM (VALUES {_Q650_CELLS})"
-        f" t(r, i, p, rn, rp, bn, bp))",
-        f"fm AS (SELECT CAST(r AS BIGINT) AS r, CAST(m AS"
-        f" BIGINT) AS m FROM (VALUES {fm}) t(r, m))",
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        "t0 AS (SELECT f.r, CAST(0 AS BIGINT) AS cov,"
-        " CAST(1 AS BIGINT) AS ways FROM fm f)",
-    ]
-    for k in range(1, 13):
-        parts.append(
-            f"m{k} AS{mat} (SELECT t.r, t.cov, t.ways,"
-            f" min(c.i) AS mc\n"
-            f"         FROM t{k - 1} t JOIN cl c ON c.r = t.r\n"
-            f"           AND (t.cov {d} c.p) % 2 = 0\n"
-            f"         GROUP BY t.r, t.cov, t.ways)")
-        parts.append(
-            f"t{k} AS{mat} (SELECT r, cov,"
-            f" CAST(sum(ways) AS BIGINT) AS ways FROM (\n"
-            f"         SELECT u.r, u.cov, u.ways FROM t{k - 1} u\n"
-            f"         JOIN fm f ON f.r = u.r AND f.m = u.cov\n"
-            f"         UNION ALL\n"
-            f"         SELECT m.r, m.cov + c.p + c.rp, m.ways\n"
-            f"         FROM m{k} m JOIN cl c ON c.r = m.r"
-            f" AND c.i = m.mc\n"
-            f"         WHERE c.rn >= 0 AND (m.cov {d} c.rp) % 2"
-            f" = 0\n"
-            f"         UNION ALL\n"
-            f"         SELECT m.r, m.cov + c.p + c.bp, m.ways\n"
-            f"         FROM m{k} m JOIN cl c ON c.r = m.r"
-            f" AND c.i = m.mc\n"
-            f"         WHERE c.bn >= 0 AND (m.cov {d} c.bp) % 2"
-            f" = 0) z GROUP BY r, cov)")
-    # Fibonacci cross-check chain F(1)..F(11)
-    parts.append("fb0 AS (SELECT CAST(1 AS BIGINT) AS a,"
-                 " CAST(1 AS BIGINT) AS b)")
-    for k in range(1, 10):
-        parts.append(f"fb{k} AS (SELECT b AS a, a + b AS b"
-                     f" FROM fb{k - 1})")
-    parts.append(
-        f"cnt AS{mat} (SELECT t.r, CAST(sum(t.ways) AS BIGINT)"
-        f" AS n_tilings\n"
-        f"         FROM t12 t JOIN fm f ON f.r = t.r"
-        f" AND f.m = t.cov\n"
-        f"         GROUP BY t.r)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT c.r, c.n_tilings,\n"
-        f"       CAST(CASE c.r WHEN 1 THEN 64 WHEN 2 THEN 0\n"
-        f"         ELSE 8 END AS BIGINT) AS aztec_expected,\n"
-        f"       CASE c.r WHEN 1 THEN c.n_tilings - 64\n"
-        f"         WHEN 3 THEN c.n_tilings - 8\n"
-        f"         ELSE c.n_tilings - f9.b END AS resid,\n"
-        f"       f9.b AS fib11, l.n_docs\n"
-        f"FROM cnt c CROSS JOIN fb9 f9 CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q650_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q650_sql(tbl, d, mat)
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q650_domino_tilings",
-       "WITH " + _q650_join("documents", "//", " MATERIALIZED"))
-def q650(spark, sf_dir):
-    """Domino tilings — the Aztec diamond theorem at two sizes
-    and the Fibonacci strip, counted by exhaustive tiling
-    enumeration (Elkies-Kuperberg-Larsen-Propp 1992 for
-    2^(n(n+1)/2); the perfect-matching counts behind dimer
-    models and the arctic circle).  Three regions tile in ONE
-    staged plan: partial tilings are coverage masks, and each
-    stage covers the MINIMUM uncovered cell (packed argmin) with
-    a domino to its right or below — the canonical-order trick
-    that makes every tiling appear exactly once with no dedup,
-    completed tilings frozen at the per-region full mask.
-    Twelve stages drain all three: the Aztec diamond AZ(3)
-    yields exactly 64 == 2^6 tilings and AZ(2) exactly 8 == 2^3
-    — the 2^(n(n+1)/2) law at two points (resid == 0), a count
-    that famously demands clever proof yet falls to honest
-    enumeration at small n; the 2x10 strip yields 89 tilings,
-    checked against an in-plan Fibonacci chain (F(11) == 89,
-    resid == 0) — the dimer-model face of the q602/q638
-    Fibonacci thread.  Scale: min-cell-first frontier expansion
-    is branch-bounded (<= 2 children per state), so the state
-    table tracks the tiling count, not the search space — the
-    shape of exact model counting done distributively."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q650_documents")
-    parts, fin0 = _q650_sql("q650_documents", "div", "")
-    # pin the staged DP (4 references per stage otherwise)
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q650_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("cl", "fm", "nd") or nm.startswith("m") \
-                or nm.startswith("t"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            if body.endswith(")"):
-                inner = body[1:-1]
-            else:
-                inner = body
-            _pin_view(spark, inner, f"q650_{nm}",
-                      max_rows=50000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin0))
-
-
-# ---------------------------------------------------------------------------
-# q651: hook length formula — Young lattice paths vs the formula
-
-
-_Q651_SHAPES = {1: (3, 2, 1), 2: (4, 4, 0), 3: (2, 2, 2)}
-
-
-def _q651_sql(tbl: str, d: str, mat: str):
-    sh = ", ".join(f"({s}, {a}, {b}, {c})"
-                   for s, (a, b, c) in _Q651_SHAPES.items())
-    # cells with precomputed hook lengths and a per-shape rank
-    cells = []
-    for s, shape in _Q651_SHAPES.items():
-        rank = 0
-        for i, r in enumerate(shape):
-            for j in range(r):
-                arm = r - j - 1
-                leg = sum(1 for k in range(i + 1, 3)
-                          if shape[k] > j)
-                cells.append((s, rank, arm + leg + 1))
-                rank += 1
-    cv = ", ".join(f"({s}, {r}, {h})" for s, r, h in cells)
-    parts = [
-        f"sh AS (SELECT CAST(s AS BIGINT) AS s, CAST(a AS"
-        f" BIGINT) AS a,\n"
-        f"           CAST(b AS BIGINT) AS b, CAST(c AS BIGINT)"
-        f" AS c\n"
-        f"         FROM (VALUES {sh}) t(s, a, b, c))",
-        f"hk AS (SELECT CAST(s AS BIGINT) AS s, CAST(r AS"
-        f" BIGINT) AS r,\n"
-        f"           CAST(h AS BIGINT) AS h FROM (VALUES {cv})"
-        f" t(s, r, h))",
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 2 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        "y0 AS (SELECT s.s, CAST(0 AS BIGINT) AS r1,"
-        " CAST(0 AS BIGINT) AS r2,\n"
-        "           CAST(0 AS BIGINT) AS r3, CAST(1 AS BIGINT)"
-        " AS ways FROM sh s)",
-    ]
-    for k in range(1, 9):
-        parts.append(
-            f"y{k} AS{mat} (SELECT s, r1, r2, r3,"
-            f" CAST(sum(ways) AS BIGINT) AS ways FROM (\n"
-            f"         SELECT y.s, y.r1 + 1 AS r1, y.r2, y.r3,"
-            f" y.ways\n"
-            f"         FROM y{k - 1} y JOIN sh h ON h.s = y.s\n"
-            f"         WHERE y.r1 < h.a\n"
-            f"         UNION ALL\n"
-            f"         SELECT y.s, y.r1, y.r2 + 1, y.r3, y.ways\n"
-            f"         FROM y{k - 1} y JOIN sh h ON h.s = y.s\n"
-            f"         WHERE y.r2 < h.b AND y.r1 > y.r2\n"
-            f"         UNION ALL\n"
-            f"         SELECT y.s, y.r1, y.r2, y.r3 + 1, y.ways\n"
-            f"         FROM y{k - 1} y JOIN sh h ON h.s = y.s\n"
-            f"         WHERE y.r3 < h.c AND y.r2 > y.r3\n"
-            f"         UNION ALL\n"
-            f"         SELECT y.s, y.r1, y.r2, y.r3, y.ways\n"
-            f"         FROM y{k - 1} y JOIN sh h ON h.s = y.s\n"
-            f"         WHERE y.r1 + y.r2 + y.r3 = h.a + h.b +"
-            f" h.c) u\n"
-            f"         GROUP BY s, r1, r2, r3)")
-    parts.append(
-        "pth AS (SELECT y.s, CAST(max(y.ways) AS BIGINT)"
-        " AS n_paths\n"
-        "         FROM y8 y JOIN sh h ON h.s = y.s\n"
-        "           AND y.r1 = h.a AND y.r2 = h.b"
-        " AND y.r3 = h.c\n"
-        "         GROUP BY y.s)")
-    # hook product fold (rank-ordered) and factorial chain
-    parts.append("hp0 AS (SELECT s, CAST(1 AS BIGINT) AS p"
-                 " FROM sh)")
-    for k in range(8):
-        parts.append(
-            f"hp{k + 1} AS (SELECT h0.s,\n"
-            f"           h0.p * coalesce(k2.h, 1) AS p\n"
-            f"         FROM hp{k} h0 LEFT JOIN hk k2\n"
-            f"           ON k2.s = h0.s AND k2.r = {k})")
-    parts.append("fc0 AS (SELECT CAST(1 AS BIGINT) AS f)")
-    for k in range(1, 9):
-        parts.append(f"fc{k} AS (SELECT f*{k} AS f FROM"
-                     f" fc{k - 1})")
-    parts.append(
-        f"hkf AS (SELECT h.s,\n"
-        f"           CAST((CASE h.s WHEN 2 THEN f8.f ELSE f6.f"
-        f" END) {d} h.p AS BIGINT) AS hook_count,\n"
-        f"           CAST((CASE h.s WHEN 2 THEN f8.f ELSE f6.f"
-        f" END) % h.p AS BIGINT) AS hook_rem\n"
-        f"         FROM hp8 h CROSS JOIN fc8 f8"
-        f" CROSS JOIN fc6 f6)")
-    parts.append(
-        f"cat AS (SELECT CAST(f8.f {d} (f4.f*f4.f) {d} 5"
-        f" AS BIGINT) AS catalan4,\n"
-        f"           CAST(f6.f {d} (f3.f*f3.f) {d} 4 AS BIGINT)"
-        f" AS catalan3\n"
-        f"         FROM fc8 f8 CROSS JOIN fc4 f4\n"
-        f"         CROSS JOIN fc6 f6 CROSS JOIN fc3 f3)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT p.s, p.n_paths, h.hook_count, h.hook_rem,\n"
-        f"       p.n_paths - h.hook_count AS hook_resid,\n"
-        f"       c.catalan4, c.catalan3,\n"
-        f"       CASE p.s WHEN 2 THEN p.n_paths - c.catalan4\n"
-        f"         WHEN 3 THEN p.n_paths - c.catalan3\n"
-        f"         ELSE 0 END AS catalan_resid,\n"
-        f"       l.n_docs\n"
-        f"FROM pth p JOIN hkf h ON h.s = p.s\n"
-        f"CROSS JOIN cat c CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q651_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q651_sql(tbl, d, mat)
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q651_hook_length",
-       "WITH " + _q651_join("documents", "//", " MATERIALIZED"))
-def q651(spark, sf_dir):
-    """The hook length formula checked against Young-lattice path
-    enumeration, with the Catalan shapes cross-referenced (Frame-
-    Robinson-Thrall 1954; standard Young tableaux count the
-    schedules of constrained parallel work, and the formula's
-    integrality is itself a theorem).  Three shapes — the
-    staircase (3,2,1), the two-row rectangle (4,4), and the
-    column-pair (2,2,2) — grow cell by cell through eight staged
-    rounds of the Young lattice: a state is a partition prefix,
-    moves add a cell to any row that stays weakly decreasing,
-    and path multiplicities accumulate in a ways column (the
-    q650 transfer-matrix DP on a different lattice).  The path
-    counts 16, 14, 5 are then checked against the hook length
-    formula computed exactly: per-cell hooks (arm + leg + 1)
-    fold into a product, and n!/product divides EXACTLY
-    (hook_rem == 0 — the formula's integrality observed, not
-    assumed) with hook_resid == 0 on every shape.  The two-row
-    shapes expose the Catalan connection: SYT(4,4) == 14 ==
-    Catalan(4) and SYT(2,2,2)... its transpose's ballot
-    structure gives 5 == Catalan(3) (catalan_resid == 0, Catalan
-    numbers from the factorial chain with exact division) — the
-    q606 parse-tree count meeting tableaux.  Scale: lattice-path
-    DP with ways-accumulation, broadcast shape dims."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q651_documents")
-    parts, fin = _q651_sql("q651_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q651_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("sh", "hk") or nm.startswith("y"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q651_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q652: the 5-puzzle — parity invariant and God's number by BFS
-
-
-_Q652_ADJ = [(0, 1), (0, 3), (1, 2), (1, 4), (2, 5), (3, 4),
-             (4, 5)]
-
-
-def _q652_sql(tbl: str, d: str, mat: str):
-    adj = ", ".join(f"({a}, {b})" for a, b in _Q652_ADJ)
-    p6 = ", ".join(f"({k}, {6 ** (5 - k)})" for k in range(6))
-    parts = [
-        f"n6 AS (SELECT DISTINCT CAST(doc_id % 6 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        f"p6 AS (SELECT CAST(k AS BIGINT) AS k, CAST(p AS"
-        f" BIGINT) AS p FROM (VALUES {p6}) t(k, p))",
-        f"ad AS (SELECT CAST(a AS BIGINT) AS a, CAST(b AS"
-        f" BIGINT) AS b FROM (VALUES {adj}) t(a, b)\n"
-        f"         UNION ALL SELECT b, a FROM (VALUES {adj})"
-        f" t(a, b))",
-        # all 720 arrangements with parity and blank position
-        "e0 AS (SELECT CAST(0 AS BIGINT) AS vis, CAST(0 AS"
-        " BIGINT) AS pk,\n"
-        "           CAST(0 AS BIGINT) AS par, CAST(-1 AS"
-        " BIGINT) AS blank FROM n6 WHERE x = 0)",
-    ]
-    for k in range(1, 7):
-        invgt = " + ".join(
-            f"(CASE WHEN {v} > c.x THEN (e.vis {d} {1 << v})"
-            f" % 2 ELSE 0 END)" for v in range(6))
-        parts.append(
-            f"e{k} AS (SELECT e.vis + pw.p AS vis,\n"
-            f"           e.pk*6 + c.x AS pk,\n"
-            f"           (e.par + {invgt}) % 2 AS par,\n"
-            f"           CASE WHEN c.x = 0 THEN {k - 1}"
-            f" ELSE e.blank END AS blank\n"
-            f"         FROM e{k - 1} e JOIN n6 c ON true\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES "
-            + ", ".join(f"({x}, {1 << x})" for x in range(6))
-            + f") t(x, p)) pw ON pw.x = c.x\n"
-            f"         WHERE (e.vis {d} pw.p) % 2 = 0)")
-    parts.append(
-        f"st AS{mat} (SELECT pk, par, blank,\n"
-        f"           (abs(blank {d} 3 - 1) + abs(blank % 3 - 2))"
-        f" % 2 AS bpar\n"
-        f"         FROM e6)")
-    # move edges: swap blank with an adjacent tile
-    parts.append(
-        f"mv AS{mat} (SELECT s.pk AS u,\n"
-        f"           s.pk - ((s.pk {d} pn.p) % 6)*pn.p\n"
-        f"             + ((s.pk {d} pn.p) % 6)*pb.p AS v\n"
-        f"         FROM st s JOIN ad a ON a.a = s.blank\n"
-        f"         JOIN p6 pb ON pb.k = s.blank\n"
-        f"         JOIN p6 pn ON pn.k = a.b)")
-    # BFS from the solved state 123450 (packed base-6)
-    solved = 0
-    for x in (1, 2, 3, 4, 5, 0):
-        solved = solved * 6 + x
-    parts.append(
-        f"v0 AS (SELECT CAST({solved} AS BIGINT) AS pk,"
-        f" CAST(0 AS BIGINT) AS dist FROM n6 WHERE x = 0)")
-    for r in range(1, 23):
-        parts.append(
-            f"v{r} AS{mat} (SELECT pk, min(dist) AS dist FROM (\n"
-            f"         SELECT pk, dist FROM v{r - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT m.v, w.dist + 1 FROM v{r - 1} w\n"
-            f"         JOIN mv m ON m.u = w.pk) t"
-            f" GROUP BY pk)")
-    parts.append(
-        f"rc AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_reachable,\n"
-        f"           CAST(max(dist) AS BIGINT) AS gods_number\n"
-        f"         FROM v22)")
-    # the parity invariant classifies reachability EXACTLY
-    parts.append(
-        f"iv AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           (CASE WHEN r.pk IS NOT NULL THEN 1 ELSE 0"
-        f" END) <>\n"
-        f"           (CASE WHEN (s.par + s.bpar) % 2 = 1 THEN 1"
-        f" ELSE 0 END)\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS invariant_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_states\n"
-        f"         FROM st s LEFT JOIN v22 r ON r.pk = s.pk)")
-    parts.append(
-        f"hs AS{mat} (SELECT dist, CAST(count(*) AS BIGINT)"
-        f" AS n FROM v22 GROUP BY dist)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT h.dist, h.n,\n"
-        f"       r.n_reachable, r.gods_number,\n"
-        f"       i.invariant_viol, i.n_states, l.n_docs\n"
-        f"FROM hs h CROSS JOIN rc r CROSS JOIN iv i"
-        f" CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q652_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q652_sql(tbl, d, mat)
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q652_five_puzzle",
-       "WITH " + _q652_join("documents", "//", " MATERIALIZED"))
-def q652(spark, sf_dir):
-    """The 2x3 sliding puzzle solved completely: the parity
-    invariant verified over every arrangement, and God's number
-    computed (Johnson & Story 1879 for the 15-puzzle's
-    impossibility proof — here the whole argument is replayed by
-    machine on the tractable sibling).  All 720 arrangements
-    enumerate with their permutation PARITY accumulated
-    incrementally (the q645 inversion-counting chain) and blank
-    position tracked; move edges are pure digit surgery on the
-    packed state (swap the blank with an adjacent tile via two
-    power-of-6 terms); BFS from the solved state runs 22
-    accumulate-min rounds.  The classical facts fall out
-    exactly: n_reachable == 360 — precisely HALF the
-    arrangements, and the invariant (permutation parity +
-    blank's taxicab parity) classifies reachability with ZERO
-    exceptions over all 720 states (invariant_viol == 0): the
-    1879 impossibility argument, verified as a biconditional by
-    exhaustion, which is strictly more than the textbook proves
-    (the textbook gives only the easy direction; the converse
-    needs the connectivity this BFS establishes).  God's number
-    lands at gods_number == 21 — the hardest position needs 21
-    moves — with the full distance histogram as output.  Scale:
-    state-space BFS with accumulate-min rounds is the q642
-    shape; the invariant check is one join over the universe."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q652_documents")
-    # Round-5 (the q599/q610 pattern): the 720-state board is a
-    # LITERAL — enumeration, move graph and the 22-round BFS run
-    # driver-side mirroring the spec (base-6 packing, inversion
-    # parity, blank taxicab parity, swap-with-adjacent moves);
-    # the CERTIFICATES — reachability census vs the parity
-    # invariant over ALL 720 states, God's-number histogram —
-    # stay relational over the pushed st/v22 tables.  The 6-value
-    # corpus dim keeps its loud tie.
-    pdf6 = spark.sql("SELECT DISTINCT doc_id % 6 AS x FROM"
-                     " q652_documents").toPandas()
-    assert len(pdf6) == 6, len(pdf6)
-    from itertools import permutations as _perms
-
-    p6 = [6 ** (5 - k) for k in range(6)]
-    nbr: dict = {}
-    for a, b in _Q652_ADJ:
-        nbr.setdefault(a, []).append(b)
-        nbr.setdefault(b, []).append(a)
-    st_rows, digits = [], {}
-    for digs in _perms(range(6)):
-        pk = 0
-        for x in digs:
-            pk = pk * 6 + x
-        inv = sum(1 for i in range(6) for j in range(i + 1, 6)
-                  if digs[i] > digs[j]) % 2
-        blank = digs.index(0)
-        bpar = (abs(blank // 3 - 1) + abs(blank % 3 - 2)) % 2
-        st_rows.append((pk, inv, blank, bpar))
-        digits[pk] = digs
-    mv: dict = {}
-    for pk, _par, blank, _bp in st_rows:
-        digs = digits[pk]
-        for b in nbr[blank]:
-            d = digs[b]
-            mv.setdefault(pk, []).append(
-                pk - d * p6[b] + d * p6[blank])
-    solved = 0
-    for x in (1, 2, 3, 4, 5, 0):
-        solved = solved * 6 + x
-    dist = {solved: 0}
-    frontier = [solved]
-    for _r in range(22):
-        nxt = []
-        for u in frontier:
-            for v in mv.get(u, ()):
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    nxt.append(v)
-        frontier = nxt
-    local_df(spark, sorted(st_rows),
-             "pk long, par long, blank long, bpar long") \
-        .createOrReplaceTempView("q652_st")
-    local_df(spark, sorted(dist.items()), "pk long, dist long") \
-        .createOrReplaceTempView("q652_v22")
-    parts, fin = _q652_sql("q652_documents", "div", "")
-    done = ["st", "v22"]
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q652_{nm}", text)
-        return text
-
-    frs = {p.split(" AS ", 1)[0].strip(): p for p in parts}
-    kept = [_qual(frs[nm]) for nm in ("rc", "iv", "hs", "ld")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q653: Thue–Morse — square-free-ish structure verified in range
-
-
-def _q653_sql(tbl: str, d: str, mat: str) -> str:
-    popc = " + ".join(f"(n.x {d} {1 << k}) % 2"
-                      for k in range(7))
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 128 AS BIGINT)"
-        f" AS x FROM {tbl}),\n"
-        f"       tm AS{mat} (SELECT n.x,\n"
-        f"           CAST(({popc}) % 2 AS BIGINT) AS t"
-        f" FROM nd n),\n"
-        # cube-freeness: no (i, l) has w[i..] == w[i+l..] ==
-        # w[i+2l..] over a full period
-        f"       cb AS{mat} (SELECT i.x AS i, l.x AS l,\n"
-        f"           CAST(sum(CASE WHEN a.t <> b.t OR b.t <> c.t"
-        f"\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS mism\n"
-        f"         FROM nd i JOIN nd l ON l.x >= 1\n"
-        f"           AND i.x + 3*l.x <= 128\n"
-        f"         JOIN nd j ON j.x < l.x\n"
-        f"         JOIN tm a ON a.x = i.x + j.x\n"
-        f"         JOIN tm b ON b.x = i.x + l.x + j.x\n"
-        f"         JOIN tm c ON c.x = i.x + 2*l.x + j.x\n"
-        f"         GROUP BY i.x, l.x),\n"
-        f"       cbv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN mism = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_cubes,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_cube_cands\n"
-        f"         FROM cb),\n"
-        # overlap-freeness: no axaxa — w[i+j] == w[i+j+l] for all
-        # j <= l (period l repeated two-and-a-half times)
-        f"       ov AS{mat} (SELECT i.x AS i, l.x AS l,\n"
-        f"           CAST(sum(CASE WHEN a.t <> b.t THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS mism\n"
-        f"         FROM nd i JOIN nd l ON l.x >= 1\n"
-        f"           AND i.x + 2*l.x + 1 <= 127\n"
-        f"         JOIN nd j ON j.x <= l.x\n"
-        f"         JOIN tm a ON a.x = i.x + j.x\n"
-        f"         JOIN tm b ON b.x = i.x + j.x + l.x\n"
-        f"         GROUP BY i.x, l.x),\n"
-        f"       ovv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN mism = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_overlaps,\n"
-        f"           CAST(count(*) AS BIGINT)"
-        f" AS n_overlap_cands\n"
-        f"         FROM ov),\n"
-        # the defining recurrences
-        f"       rc AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN e.t <> h.t THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS even_viol,\n"
-        f"           CAST(sum(CASE WHEN o.t <> 1 - h.t THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS odd_viol\n"
-        f"         FROM tm h\n"
-        f"         JOIN tm e ON e.x = 2*h.x\n"
-        f"         LEFT JOIN tm o ON o.x = 2*h.x + 1\n"
-        f"         WHERE h.x < 64),\n"
-        # balance: the first 2^k terms split exactly in half
-        f"       bl AS{mat} (SELECT w.k,\n"
-        f"           CAST(sum(t.t) AS BIGINT) AS ones,\n"
-        f"           CAST(w.p {d} 2 AS BIGINT) AS half\n"
-        f"         FROM (SELECT CAST(k AS BIGINT) AS k, CAST(p"
-        f" AS BIGINT) AS p FROM (VALUES "
-        + ", ".join(f"({k}, {1 << k})" for k in range(1, 8))
-        + ") t(k, p)) w\n"
-        f"         JOIN tm t ON t.x < w.p GROUP BY w.k, w.p),\n"
-        f"       blv AS (SELECT CAST(sum(CASE WHEN ones <> half"
-        f"\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS balance_viol FROM bl),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT b.k, b.ones, b.half,\n"
-        f"       c.n_cubes, c.n_cube_cands,\n"
-        f"       o.n_overlaps, o.n_overlap_cands,\n"
-        f"       r.even_viol, r.odd_viol, v.balance_viol,\n"
-        f"       l.n_docs\n"
-        f"FROM bl b CROSS JOIN cbv c CROSS JOIN ovv o\n"
-        f"CROSS JOIN rc r CROSS JOIN blv v CROSS JOIN ld l")
-
-
-@query("q653_thue_morse",
-       "WITH " + _q653_sql("documents", "//", " MATERIALIZED"))
-def q653(spark, sf_dir):
-    """The Thue–Morse sequence — cube-freeness and overlap-
-    freeness verified over every candidate factor in range
-    (Thue 1906, Morse 1921; the canonical aperiodic bit
-    sequence: fair-alternation schedules, Koch-curve turns, and
-    the first theorem of combinatorics on words).  The first 128
-    terms generate as popcount parity (pure div/mod); then every
-    structural claim is checked against every witness position:
-    CUBE-freeness — among all n_cube_cands (i, l) windows fitting
-    three full periods, not one has all three copies equal
-    (n_cubes == 0, Thue's theorem made finite and exhaustive);
-    the strictly stronger OVERLAP-freeness — no factor of the
-    form axaxa, i.e. no period l sustained for 2l+1 positions
-    (n_overlaps == 0 over all candidates, the property that
-    makes Thue-Morse the extremal binary word); the defining
-    recurrences t(2n) = t(n), t(2n+1) = 1 - t(n) at every n
-    (even_viol == odd_viol == 0 — generation and recursion
-    agreeing); and exact BALANCE — the first 2^k terms contain
-    exactly 2^(k-1) ones for every k (balance_viol == 0, the
-    fair-duel property).  Scale: window checks are equi-joins of
-    the sequence against itself at computed offsets — the
-    self-join-at-lag shape of any periodicity audit, exhaustive
-    because the range is finite and stated."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q653_documents")
-    return spark.sql(
-        "WITH " + _q653_sql("q653_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q654: Fermat two squares + Jacobi's r2 formula, in range
-
-
-def _q654_sql(tbl: str, d: str, mat: str) -> str:
-    pp = []
-    for p in (3, 7, 11, 19, 23, 31, 43, 47, 59, 67, 71, 79, 83,
-              103, 107, 127, 131, 139, 151, 163, 167, 179, 191,
-              199, 211, 223, 227, 239, 251, 263, 271, 283, 307,
-              311, 331, 347, 359, 367, 379, 383):
-        e = 1
-        while p ** e <= 400:
-            pp.append((p, e, p ** e))
-            e += 1
-    ppv = ", ".join(f"({p}, {e}, {q})" for p, e, q in pp)
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 401 AS BIGINT)"
-        f" AS n FROM {tbl}),\n"
-        f"       ad AS (SELECT DISTINCT CAST(doc_id % 41 - 20"
-        f" AS BIGINT) AS a FROM {tbl}),\n"
-        # signed representation counts r2(n)
-        f"       r2 AS{mat} (SELECT n.n,\n"
-        f"           CAST(coalesce(c.c, 0) AS BIGINT) AS r2\n"
-        f"         FROM nd n LEFT JOIN (\n"
-        f"           SELECT a.a*a.a + b.a*b.a AS n,\n"
-        f"             CAST(count(*) AS BIGINT) AS c\n"
-        f"           FROM ad a CROSS JOIN ad b\n"
-        f"           WHERE a.a*a.a + b.a*b.a <= 400\n"
-        f"           GROUP BY a.a*a.a + b.a*b.a) c"
-        f" ON c.n = n.n),\n"
-        # Fermat criterion via 4k+3 prime-power parity
-        f"       pq AS (SELECT CAST(p AS BIGINT) AS p, CAST(e"
-        f" AS BIGINT) AS e,\n"
-        f"           CAST(q AS BIGINT) AS q FROM (VALUES {ppv})"
-        f" t(p, e, q)),\n"
-        f"       ex AS{mat} (SELECT n.n, w.p,"
-        f" CAST(max(w.e) AS BIGINT) AS e\n"
-        f"         FROM nd n JOIN pq w ON n.n % w.q = 0\n"
-        f"         GROUP BY n.n, w.p),\n"
-        f"       bad AS{mat} (SELECT DISTINCT n FROM ex"
-        f" WHERE e % 2 = 1),\n"
-        f"       fv AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           (CASE WHEN r.r2 > 0 THEN 1 ELSE 0 END) <>\n"
-        f"           (CASE WHEN b.n IS NULL THEN 1 ELSE 0 END)\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS fermat_viol,\n"
-        f"           CAST(sum(CASE WHEN r.r2 > 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_representable\n"
-        f"         FROM r2 r LEFT JOIN bad b ON b.n = r.n\n"
-        f"         WHERE r.n >= 1),\n"
-        # Jacobi: r2(n) == 4 (d1(n) - d3(n)) for every n >= 1
-        f"       dv AS{mat} (SELECT n.n,\n"
-        f"           CAST(sum(CASE WHEN d2.n % 4 = 1 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS d1,\n"
-        f"           CAST(sum(CASE WHEN d2.n % 4 = 3 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS d3\n"
-        f"         FROM nd n JOIN nd d2 ON d2.n >= 1"
-        f" AND n.n % d2.n = 0\n"
-        f"         WHERE n.n >= 1 GROUP BY n.n),\n"
-        f"       jv AS (SELECT CAST(sum(CASE WHEN r.r2 <>\n"
-        f"           4*(v.d1 - v.d3) THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS jacobi_viol\n"
-        f"         FROM dv v JOIN r2 r ON r.n = v.n),\n"
-        f"       blk AS{mat} (SELECT r.n {d} 40 AS b,\n"
-        f"           CAST(sum(CASE WHEN r.r2 > 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_rep,\n"
-        f"           CAST(sum(r.r2) AS BIGINT) AS r2_sum\n"
-        f"         FROM r2 r WHERE r.n >= 1"
-        f" GROUP BY r.n {d} 40),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT k.b, k.n_rep, k.r2_sum,\n"
-        f"       f.fermat_viol, f.n_representable,\n"
-        f"       j.jacobi_viol, l.n_docs\n"
-        f"FROM blk k CROSS JOIN fv f CROSS JOIN jv j"
-        f" CROSS JOIN ld l")
-
-
-@query("q654_two_squares",
-       "WITH " + _q654_sql("documents", "//", " MATERIALIZED"))
-def q654(spark, sf_dir):
-    """Fermat's two-square theorem as a finite BICONDITIONAL,
-    plus Jacobi's exact representation count, both verified at
-    every n <= 400 (Fermat 1640, Jacobi 1829 — which integers
-    are sums of two squares, and in how many ways; the norm
-    structure of the Gaussian integers read off a table).
-    Representation counts come from brute force — the signed
-    (a, b) grid in [-20, 20]^2 aggregated by a^2 + b^2 — and the
-    criterion comes from arithmetic that never sees a square:
-    for each n, the exponent of every prime p == 3 (mod 4) in
-    its factorization (max prime-power divisor via the
-    prime-power dim), n flagged bad iff some such exponent is
-    odd.  fermat_viol == 0: representable EXACTLY WHEN no 4k+3
-    prime appears to an odd power, both directions, all 400
-    cases.  Jacobi's formula is stronger and also holds
-    everywhere: r2(n) == 4(d1(n) - d3(n)) — the signed
-    representation COUNT equals four times the excess of 1 mod 4
-    divisors over 3 mod 4 divisors (jacobi_viol == 0, divisors
-    by mod-join) — a generating-function identity checked
-    pointwise.  Per-40-block density rows show the thinning of
-    representable numbers.  Scale: the grid aggregate and the
-    divisor join are the whole cost; factorization uses a
-    broadcast prime-power dim."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q654_documents")
-    return spark.sql(
-        "WITH " + _q654_sql("q654_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q655: Legendre three squares + Lagrange four squares, in range
-
-
-def _q655_sql(tbl: str, d: str, mat: str) -> str:
-    return (
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 401 AS BIGINT)"
-        f" AS n FROM {tbl}),\n"
-        f"       sd AS (SELECT DISTINCT CAST(doc_id % 21"
-        f" AS BIGINT) AS a FROM {tbl}),\n"
-        f"       r3 AS{mat} (SELECT a.a*a.a + b.a*b.a +"
-        f" c.a*c.a AS n,\n"
-        f"           CAST(count(*) AS BIGINT) AS c\n"
-        f"         FROM sd a CROSS JOIN sd b CROSS JOIN sd c\n"
-        f"         WHERE a.a*a.a + b.a*b.a + c.a*c.a <= 400\n"
-        f"         GROUP BY a.a*a.a + b.a*b.a + c.a*c.a),\n"
-        # Legendre form: strip factors of 4, test 8b+7
-        f"       lg AS{mat} (SELECT n.n,\n"
-        f"           CAST(CASE WHEN (n.n {d} t.q) % 8 = 7"
-        f" THEN 1\n"
-        f"             ELSE 0 END AS BIGINT) AS bad_form\n"
-        f"         FROM nd n JOIN (\n"
-        f"           SELECT n2.n, max(p.q) AS q\n"
-        f"           FROM nd n2 JOIN (SELECT CAST(q AS BIGINT)"
-        f" AS q FROM\n"
-        f"             (VALUES (1), (4), (16), (64), (256))"
-        f" v(q)) p\n"
-        f"             ON n2.n % p.q = 0 AND (n2.n = 0 OR\n"
-        f"               (n2.n {d} p.q) % 4 <> 0 OR p.q = 256)\n"
-        f"           GROUP BY n2.n) t ON t.n = n.n\n"
-        f"         WHERE n.n >= 1),\n"
-        f"       lv AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           (CASE WHEN r.n IS NOT NULL THEN 1 ELSE 0"
-        f" END) <>\n"
-        f"           1 - g.bad_form THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS legendre_viol,\n"
-        f"           CAST(sum(g.bad_form) AS BIGINT)"
-        f" AS n_three_square_exceptions\n"
-        f"         FROM lg g LEFT JOIN r3 r ON r.n = g.n),\n"
-        # Lagrange: every n is r3-representable after removing
-        # one square
-        f"       l4 AS (SELECT CAST(sum(CASE WHEN x.ok = 0"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS lagrange_viol"
-        f" FROM (\n"
-        f"           SELECT n.n, max(CASE WHEN r.n IS NOT NULL"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS ok\n"
-        f"           FROM nd n JOIN sd d2"
-        f" ON d2.a*d2.a <= n.n\n"
-        f"           LEFT JOIN r3 r ON r.n = n.n - d2.a*d2.a\n"
-        f"           GROUP BY n.n) x),\n"
-        f"       blk AS{mat} (SELECT g.n {d} 40 AS b,\n"
-        f"           CAST(sum(g.bad_form) AS BIGINT)"
-        f" AS n_exceptions\n"
-        f"         FROM lg g GROUP BY g.n {d} 40),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT k.b, k.n_exceptions,\n"
-        f"       v.legendre_viol, v.n_three_square_exceptions,\n"
-        f"       f.lagrange_viol, l.n_docs\n"
-        f"FROM blk k CROSS JOIN lv v CROSS JOIN l4 f"
-        f" CROSS JOIN ld l")
-
-
-@query("q655_three_four_squares",
-       "WITH " + _q655_sql("documents", "//", " MATERIALIZED"))
-def q655(spark, sf_dir):
-    """Legendre's three-square theorem as a biconditional and
-    Lagrange's four-square theorem as a universal, both
-    exhausted to 400 (Legendre 1797, Lagrange 1770 — the
-    complete answer to 'how many squares do you need', with the
-    obstruction class 4^a(8b+7) that makes three squares subtly
-    harder than two or four).  Three-square representability
-    comes from the brute-force nonneg triple grid; the
-    obstruction test strips factors of 4 arithmetically (largest
-    4-power divisor via a max-divisor join) and checks the
-    residue 7 mod 8.  legendre_viol == 0 over every n in
-    1..400: NOT representable exactly when of the form
-    4^a(8b+7) — both directions of the one sum-of-squares
-    theorem whose proof resists elementary methods, here a
-    measured equivalence with n_three_square_exceptions == 65
-    obstruction numbers in range (7, 15, 23, 28, ... — the
-    per-40-block exception counts are the output rows).
-    Lagrange then follows constructively: every n becomes
-    three-square representable after removing ONE square
-    (lagrange_viol == 0 via the r3-minus-a-square join) — four
-    squares always suffice, verified witness-by-witness.
-    Scale: two grid aggregations and two joins; the theorems'
-    entire content in range fits one plan."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q655_documents")
-    return spark.sql(
-        "WITH " + _q655_sql("q655_documents", "div", ""))
 
 
 # ---------------------------------------------------------------------------
@@ -52049,7 +11807,7 @@ def _q656_join(tbl: str, d: str, mat: str) -> str:
 
 
 @query("q656_wilson_primroots",
-       "WITH " + _q656_join("documents", "//", " MATERIALIZED"))
+       "WITH " + _q656_join("documents", "//", " MATERIALIZED"), kind="operator")
 def q656(spark, sf_dir):
     """Wilson's theorem by PARALLEL PREFIX PRODUCTS, and the
     primitive-root census of Z_23* (Wilson/Lagrange 1770s, Gauss
@@ -52097,13317 +11855,6 @@ def q656(spark, sf_dir):
             kept.append(_qual(fr))
     return spark.sql("WITH " + ",\n       ".join(kept)
                      + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q657: Lucas-Lehmer + Euclid-Euler perfect numbers
-
-
-_Q657_P = [3, 5, 7, 11, 13]
-
-
-def _q657_sql(tbl: str, d: str, mat: str) -> str:
-    pv = ", ".join(f"({p}, {2 ** p - 1}, {2 ** (p - 1)})"
-                   for p in _Q657_P)
-    parts = [
-        f"pd AS (SELECT CAST(p AS BIGINT) AS p, CAST(m AS"
-        f" BIGINT) AS m,\n"
-        f"           CAST(h AS BIGINT) AS h FROM (VALUES {pv})"
-        f" t(p, m, h)),\n"
-        f"       dd AS (SELECT DISTINCT a.x*38 + b.x + 1 AS dv\n"
-        f"         FROM (SELECT CAST(doc_id % 153 AS BIGINT)"
-        f" AS x FROM {tbl}) a\n"
-        f"         CROSS JOIN (SELECT CAST(doc_id % 38"
-        f" AS BIGINT) AS x FROM {tbl}) b\n"
-        f"         WHERE a.x*38 + b.x + 1 <= 5793),\n"
-        f"       s0 AS (SELECT p, m, CAST(4 AS BIGINT) AS s,\n"
-        f"           CAST(0 AS BIGINT) AS step FROM pd)"]
-    for k in range(1, 12):
-        parts.append(
-            f"s{k} AS (SELECT p, m,\n"
-            f"           CASE WHEN step < p - 2 THEN\n"
-            f"             (s*s - 2) % m ELSE s END AS s,\n"
-            f"           CASE WHEN step < p - 2 THEN step + 1\n"
-            f"             ELSE step END AS step FROM s{k - 1})")
-    parts.append(
-        f"ll AS{mat} (SELECT p, m,\n"
-        f"           CAST(CASE WHEN s = 0 THEN 1 ELSE 0 END"
-        f" AS BIGINT) AS ll_pass FROM s11)")
-    # trial-division ground truth for each Mersenne number
-    parts.append(
-        f"tp AS{mat} (SELECT w.p,\n"
-        f"           CAST(CASE WHEN min(v.dv) IS NULL THEN 1"
-        f" ELSE 0 END AS BIGINT) AS isp,\n"
-        f"           CAST(coalesce(min(v.dv), 0) AS BIGINT)"
-        f" AS witness\n"
-        f"         FROM pd w LEFT JOIN dd v ON v.dv >= 2\n"
-        f"           AND v.dv*v.dv <= w.m AND w.m % v.dv = 0\n"
-        f"         GROUP BY w.p)")
-    # sigma of the Euclid number 2^(p-1) M_p by divisor pairing
-    parts.append(
-        f"sg AS{mat} (SELECT w.p, w.h*w.m AS n,\n"
-        f"           CAST(sum(v.dv + (w.h*w.m) {d} v.dv)\n"
-        f"             - sum(CASE WHEN v.dv*v.dv = w.h*w.m"
-        f" THEN v.dv ELSE 0 END) AS BIGINT) AS sigma\n"
-        f"         FROM pd w JOIN dd v ON v.dv >= 1\n"
-        f"           AND v.dv*v.dv <= w.h*w.m\n"
-        f"           AND (w.h*w.m) % v.dv = 0\n"
-        f"         GROUP BY w.p, w.h*w.m)")
-    parts.append(
-        f"vf AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN l.ll_pass <> t.isp"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS ll_viol,\n"
-        f"           CAST(sum(CASE WHEN (CASE WHEN s.sigma =\n"
-        f"             2*s.n THEN 1 ELSE 0 END) <> l.ll_pass\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS euclid_euler_viol\n"
-        f"         FROM ll l JOIN tp t ON t.p = l.p\n"
-        f"         JOIN sg s ON s.p = l.p)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT l.p, l.m, l.ll_pass, t.isp, t.witness,\n"
-        f"       s.n AS euclid_number, s.sigma,\n"
-        f"       s.sigma - 2*s.n AS perfect_resid,\n"
-        f"       v.ll_viol, v.euclid_euler_viol, d2.n_docs\n"
-        f"FROM ll l JOIN tp t ON t.p = l.p\n"
-        f"JOIN sg s ON s.p = l.p\n"
-        f"CROSS JOIN vf v CROSS JOIN ld d2")
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q657_lucas_lehmer",
-       "WITH " + _q657_sql("documents", "//", " MATERIALIZED"))
-def q657(spark, sf_dir):
-    """Lucas-Lehmer and Euclid-Euler — the Mersenne/perfect-
-    number correspondence with all three faces computed (Lucas
-    1878, Lehmer 1930; Euclid IX.36, Euler; the test behind
-    every record prime, exercised where ground truth is
-    checkable).  For p in {3,5,7,11,13}: the LL recurrence
-    s <- s^2 - 2 mod M_p runs as 11 frozen-guarded stages
-    (values stay under 8191^2, exact BIGINT), the verdict
-    s == 0; trial division against the paired-divisor dim gives
-    independent primality with the WITNESS emitted — and p = 11
-    is the famous break: M_11 == 2047 == 23 x 89 fails LL and
-    trial division agrees (witness 23), the case that ended
-    Mersenne's conjecture, sitting beside four genuine Mersenne
-    primes (ll_viol == 0 across all five).  Euclid-Euler then
-    closes the triangle: sigma(2^(p-1) M_p), computed honestly
-    by the sqrt-paired divisor join, equals exactly twice the
-    number PRECISELY when LL passes (euclid_euler_viol == 0) —
-    6, 28, 496, 8128 are perfect and 2^10 x 2047 is not
-    (perfect_resid emitted shows its abundance) — primality,
-    the recurrence, and the divisor sum agreeing pairwise on
-    every instance.  Scale: staged recurrences and one
-    divisor-pair join; the dims are generated."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q657_documents")
-    return spark.sql(
-        "WITH " + _q657_sql("q657_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q658: Banker's algorithm — safe and unsafe instances certified
-
-
-_Q658_ALLOC = [[0, 1, 0], [2, 0, 0], [3, 0, 2], [2, 1, 1]]
-_Q658_MAX = [[7, 5, 3], [3, 2, 2], [9, 0, 2], [2, 2, 2]]
-_Q658_AVAIL = {1: [3, 3, 2], 2: [1, 0, 0]}
-
-
-def _q658_sql(tbl: str, d: str, mat: str):
-    am = ", ".join(
-        f"({inst}, {p}, {r}, {_Q658_ALLOC[p][r]},"
-        f" {_Q658_MAX[p][r]})"
-        for inst in (1, 2) for p in range(4) for r in range(3))
-    av = ", ".join(f"({i}, {a[0]}, {a[1]}, {a[2]})"
-                   for i, a in _Q658_AVAIL.items())
-    parts = [
-        f"am AS (SELECT CAST(i AS BIGINT) AS i, CAST(p AS"
-        f" BIGINT) AS p,\n"
-        f"           CAST(r AS BIGINT) AS r, CAST(al AS BIGINT)"
-        f" AS al,\n"
-        f"           CAST(mx AS BIGINT) AS mx,\n"
-        f"           CAST(mx - al AS BIGINT) AS nd\n"
-        f"         FROM (VALUES {am}) t(i, p, r, al, mx))",
-        f"docs2 AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-        f"s0 AS (SELECT CAST(i AS BIGINT) AS i, CAST(a1 AS"
-        f" BIGINT) AS a1,\n"
-        f"           CAST(a2 AS BIGINT) AS a2, CAST(a3 AS"
-        f" BIGINT) AS a3,\n"
-        f"           CAST(0 AS BIGINT) AS done_mask\n"
-        f"         FROM (VALUES {av}) t(i, a1, a2, a3))",
-    ]
-    for k in range(1, 5):
-        parts.append(
-            f"p{k} AS (SELECT s.i, s.a1, s.a2, s.a3,"
-            f" s.done_mask,\n"
-            f"           CAST(coalesce(sum(CASE WHEN ok.f = 1\n"
-            f"             THEN pw.p END), 0) AS BIGINT)"
-            f" AS new_mask\n"
-            f"         FROM s{k - 1} s LEFT JOIN (\n"
-            f"           SELECT m.i, m.p,\n"
-            f"             CAST(1 AS BIGINT) AS f\n"
-            f"           FROM am m GROUP BY m.i, m.p) pr\n"
-            f"           ON pr.i = s.i\n"
-            f"         LEFT JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES (0, 1),"
-            f" (1, 2), (2, 4), (3, 8)) v(x, p)) pw\n"
-            f"           ON pw.x = pr.p\n"
-            f"         LEFT JOIN (SELECT n.i, n.p,"
-            f" CAST(1 AS BIGINT) AS f\n"
-            f"           FROM am n JOIN s{k - 1} z ON z.i = n.i\n"
-            f"           GROUP BY n.i, n.p, z.a1, z.a2, z.a3,"
-            f" z.done_mask\n"
-            f"           HAVING max(CASE WHEN (n.r = 0 AND n.nd"
-            f" > z.a1)\n"
-            f"             OR (n.r = 1 AND n.nd > z.a2)\n"
-            f"             OR (n.r = 2 AND n.nd > z.a3)\n"
-            f"             THEN 1 ELSE 0 END) = 0\n"
-            f"           AND max((z.done_mask {d} CASE n.p"
-            f" WHEN 0 THEN 1\n"
-            f"             WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8"
-            f" END) % 2) = 0) ok\n"
-            f"           ON ok.i = pr.i AND ok.p = pr.p\n"
-            f"         GROUP BY s.i, s.a1, s.a2, s.a3,"
-            f" s.done_mask)")
-        parts.append(
-            f"s{k} AS (SELECT q.i,\n"
-            f"           q.a1 + coalesce(rel.r1, 0) AS a1,\n"
-            f"           q.a2 + coalesce(rel.r2, 0) AS a2,\n"
-            f"           q.a3 + coalesce(rel.r3, 0) AS a3,\n"
-            f"           q.done_mask + q.new_mask AS done_mask\n"
-            f"         FROM p{k} q LEFT JOIN (\n"
-            f"           SELECT m.i, z.done_mask, z.new_mask,\n"
-            f"             CAST(sum(CASE WHEN m.r = 0 THEN m.al"
-            f" ELSE 0 END) AS BIGINT) AS r1,\n"
-            f"             CAST(sum(CASE WHEN m.r = 1 THEN m.al"
-            f" ELSE 0 END) AS BIGINT) AS r2,\n"
-            f"             CAST(sum(CASE WHEN m.r = 2 THEN m.al"
-            f" ELSE 0 END) AS BIGINT) AS r3\n"
-            f"           FROM am m JOIN p{k} z ON z.i = m.i\n"
-            f"           WHERE (z.new_mask {d} CASE m.p WHEN 0"
-            f" THEN 1\n"
-            f"             WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8"
-            f" END) % 2 = 1\n"
-            f"           GROUP BY m.i, z.done_mask, z.new_mask)"
-            f" rel\n"
-            f"           ON rel.i = q.i AND rel.done_mask ="
-            f" q.done_mask\n"
-            f"           AND rel.new_mask = q.new_mask)")
-    parts.append(
-        f"vf AS (SELECT s.i,\n"
-        f"           CAST(CASE WHEN s.done_mask = 15 THEN 1"
-        f" ELSE 0 END AS BIGINT) AS safe,\n"
-        f"           s.done_mask, s.a1, s.a2, s.a3\n"
-        f"         FROM s4 s)")
-    # blocked audit: every undone process genuinely exceeds the
-    # final available vector in some resource
-    parts.append(
-        f"bk AS (SELECT v.i, CAST(sum(CASE WHEN t.blocked = 0\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS unblocked_undone FROM vf v\n"
-        f"         LEFT JOIN (SELECT m.i, m.p,\n"
-        f"             max(CASE WHEN (m.r = 0 AND m.nd > w.a1)\n"
-        f"               OR (m.r = 1 AND m.nd > w.a2)\n"
-        f"               OR (m.r = 2 AND m.nd > w.a3)\n"
-        f"               THEN 1 ELSE 0 END) AS blocked\n"
-        f"           FROM am m JOIN vf w ON w.i = m.i\n"
-        f"           WHERE (w.done_mask {d} CASE m.p WHEN 0"
-        f" THEN 1\n"
-        f"             WHEN 1 THEN 2 WHEN 2 THEN 4 ELSE 8 END)"
-        f" % 2 = 0\n"
-        f"           GROUP BY m.i, m.p) t ON t.i = v.i\n"
-        f"         GROUP BY v.i)")
-    fin = (
-        f"SELECT v.i, v.safe, v.done_mask, v.a1, v.a2, v.a3,\n"
-        f"       b.unblocked_undone, d2.n_docs\n"
-        f"FROM vf v JOIN bk b ON b.i = v.i\n"
-        f"CROSS JOIN docs2 d2")
-    return parts, fin
-
-
-def _q658_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q658_sql(tbl, d, mat)
-    if mat:
-        parts = [re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-                 for p in parts]
-    return ",\n       ".join(parts) + "\n" + fin
-
-
-@query("q658_bankers_algorithm",
-       "WITH " + _q658_join("documents", "//", " MATERIALIZED"))
-def q658(spark, sf_dir):
-    """Banker's algorithm — deadlock avoidance with the safe and
-    unsafe verdicts both audited (Dijkstra 1965; the safe-state
-    test under every resource-grant decision).  Two instances of
-    the classic 4-process, 3-resource system share the plan:
-    round-synchronous peeling (every currently-satisfiable
-    process releases simultaneously — the greedy-all schedule,
-    sound because satisfiability is monotone in available
-    resources) runs four rounds with the done-set packed as a
-    bitmask and the available vector updated from the released
-    allocations.  The safe instance finishes (safe == 1,
-    done_mask == 15) with the final availability equal to total
-    resources; the unsafe instance — same allocations, starved
-    initial availability — peels NOTHING.  The verdicts are then
-    audited rather than trusted: unblocked_undone == 0 on both
-    instances verifies that every process left undone genuinely
-    exceeds the FINAL available vector in some resource (for the
-    safe instance vacuously; for the unsafe one, all four
-    processes individually blocked — the certificate that no
-    schedule was missed, since greedy-all dominates any
-    schedule).  Scale: each round is two grouped joins over the
-    (instance, process, resource) table — the shape of admission
-    control over thousands of tenants at once."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q658_documents")
-    parts, fin = _q658_sql("q658_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q658_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("am",) or nm.startswith("s") or \
-                nm.startswith("p"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q658_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q659: model checking Peterson's lock — three variants, three fates
-
-
-def _q659_sql(tbl: str, d: str, mat: str):
-    # state pack: pc0*64 + pc1*16 + f0*8 + f1*4 + t*2 (t in 0/1)
-    parts = [
-        f"vd AS (SELECT CAST(v AS BIGINT) AS v FROM (VALUES"
-        f" (1), (2), (3)) t(v)),\n"
-        f"       pcd AS (SELECT DISTINCT CAST(doc_id % 4"
-        f" AS BIGINT) AS x FROM {tbl}),\n"
-        f"       bd AS (SELECT DISTINCT CAST(doc_id % 2"
-        f" AS BIGINT) AS x FROM {tbl}),\n"
-        f"       st AS{mat} (SELECT v.v, p0.x AS pc0, p1.x AS"
-        f" pc1,\n"
-        f"           f0.x AS f0, f1.x AS f1, tt.x AS t,\n"
-        f"           p0.x*64 + p1.x*16 + f0.x*8 + f1.x*4 +"
-        f" tt.x*2 AS s\n"
-        f"         FROM vd v CROSS JOIN pcd p0 CROSS JOIN pcd"
-        f" p1\n"
-        f"         CROSS JOIN bd f0 CROSS JOIN bd f1"
-        f" CROSS JOIN bd tt)",
-    ]
-    # transition relation: both processes, four program points
-    arms = []
-    for who in (0, 1):
-        pc, po = (f"pc{who}", f"pc{1 - who}")
-        fm, fo = (f"f{who}", f"f{1 - who}")
-        npc = lambda v: (
-            f"{'x.pc0*64 + x.pc1*16' if False else ''}")
-        # pc = 0: set own flag (variant 3 skips), pc -> 1
-        newf = f"CASE WHEN x.v = 3 THEN x.{fm} ELSE 1 END"
-        s_new = (f"(CASE WHEN {who} = 0 THEN {v0} ELSE x.pc0"
-                 f" END)") if False else None
-        def pack(pc0, pc1, f0, f1, t):
-            return (f"({pc0})*64 + ({pc1})*16 + ({f0})*8 +"
-                    f" ({f1})*4 + ({t})*2")
-        pcs = {0: "x.pc0", 1: "x.pc1"}
-        fs = {0: "x.f0", 1: "x.f1"}
-        mk = lambda **kw: pack(
-            kw.get("pc0", "x.pc0"), kw.get("pc1", "x.pc1"),
-            kw.get("f0", "x.f0"), kw.get("f1", "x.f1"),
-            kw.get("t", "x.t"))
-        arms.append(
-            f"SELECT x.v, x.s AS u,\n"
-            f"  {mk(**{f'pc{who}': '1', f'f{who}': newf})} AS w\n"
-            f"FROM st x WHERE x.{pc} = 0")
-        newt = f"CASE WHEN x.v = 2 THEN x.t ELSE {1 - who} END"
-        arms.append(
-            f"SELECT x.v, x.s,\n"
-            f"  {mk(**{f'pc{who}': '2', 't': newt})}\n"
-            f"FROM st x WHERE x.{pc} = 1")
-        arms.append(
-            f"SELECT x.v, x.s,\n"
-            f"  {mk(**{f'pc{who}': '3'})}\n"
-            f"FROM st x WHERE x.{pc} = 2\n"
-            f"  AND (x.{fo} = 0 OR (x.v <> 2 AND x.t = {who}))")
-        arms.append(
-            f"SELECT x.v, x.s,\n"
-            f"  {mk(**{f'pc{who}': '0', f'f{who}': '0'})}\n"
-            f"FROM st x WHERE x.{pc} = 3")
-    parts.append("tr AS{mat} (".replace("{mat}", "{mat}")
-                 + "\n UNION ALL ".join(arms) + ")")
-    # reachability from the all-zero state by doubling closure
-    parts.append(
-        "r0 AS (SELECT v, s AS a, s AS b FROM st\n"
-        "         UNION SELECT v, u, w FROM tr)")
-    prev = "r0"
-    for k in range(1, 6):
-        parts.append(
-            f"r{k} AS (SELECT DISTINCT z.v, z.a, z.b FROM (\n"
-            f"         SELECT v, a, b FROM {prev}\n"
-            f"         UNION ALL\n"
-            f"         SELECT p.v, p.a, q.b FROM {prev} p\n"
-            f"         JOIN {prev} q ON q.v = p.v"
-            f" AND q.a = p.b) z)")
-        prev = f"r{k}"
-    parts.append(
-        f"rc AS (SELECT v, b AS s FROM {prev} WHERE a = 0)")
-    parts.append(
-        f"agg AS (SELECT r.v,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_reachable,\n"
-        f"           CAST(sum(CASE WHEN t.pc0 = 3 AND t.pc1 = 3"
-        f"\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS mutex_viol\n"
-        f"         FROM rc r JOIN st t ON t.v = r.v"
-        f" AND t.s = r.s\n"
-        f"         GROUP BY r.v)")
-    parts.append(
-        f"dlk AS (SELECT r.v,\n"
-        f"           CAST(sum(CASE WHEN o.u IS NULL THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS n_deadlocks,\n"
-        f"           CAST(max(CASE WHEN o.u IS NULL THEN r.s"
-        f" END) AS BIGINT) AS deadlock_state\n"
-        f"         FROM rc r LEFT JOIN (SELECT DISTINCT v, u"
-        f" FROM tr) o\n"
-        f"           ON o.v = r.v AND o.u = r.s\n"
-        f"         GROUP BY r.v)")
-    parts.append(
-        f"docs2 AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT a.v, a.n_reachable, a.mutex_viol,\n"
-        f"       k.n_deadlocks,"
-        f" CAST(coalesce(k.deadlock_state, -1) AS BIGINT)"
-        f" AS deadlock_state,\n"
-        f"       d2.n_docs\n"
-        f"FROM agg a JOIN dlk k ON k.v = a.v\n"
-        f"CROSS JOIN docs2 d2")
-    return parts, fin
-
-
-def _q659_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q659_sql(tbl, d, mat)
-    return ",\n       ".join(
-        p.replace("{mat}", mat) for p in parts) + "\n" + fin
-
-
-@query("q659_peterson_model_check",
-       "WITH " + _q659_join("documents", "//", " MATERIALIZED"))
-def q659(spark, sf_dir):
-    """Model checking Peterson's mutual-exclusion lock — and two
-    broken variants that fail on DIFFERENT axes (Peterson 1981;
-    exhaustive state-space verification, the industrial
-    technique, on the canonical concurrency algorithm).  The
-    full state space (program counters, flags, turn — 128
-    packed states x 3 protocol variants) materializes with the
-    transition relation as eight guarded UNION arms per variant:
-    set-flag, set-turn (the no-turn variant skips it), the wait
-    test !flag_other OR turn == me (the no-flag variant never
-    raises flags), and CS exit.  Reachability from the all-idle
-    state closes by doubling, and the verdicts are counted over
-    REACHABLE states only — which is the entire discipline of
-    model checking: (variant 1) correct Peterson reaches 20
-    states with mutex_viol == 0 AND n_deadlocks == 0 — safety
-    and deadlock-freedom verified over every reachable state;
-    (variant 2) dropping the turn variable KEEPS mutual
-    exclusion (mutex_viol == 0 — flags alone prevent collision)
-    but deadlocks at exactly one reachable state, both processes
-    flagged and waiting forever (the state emitted) — a liveness
-    failure invisible to safety-only testing; (variant 3)
-    dropping the flags keeps things live but admits 2 reachable
-    states with BOTH processes in the critical section — the
-    mutex violation itself, exhibited.  One algorithm, two
-    deletions, three different fates, all proven by exhaustion.
-    Scale: the q610 product-automaton machinery as a
-    verification tool — transition relations are joins."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q659_documents")
-    parts, fin = _q659_sql("q659_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q659_{nm}", text)
-        return text
-
-    kept = []
-    first = parts[0].replace("{mat}", "")
-    _pin_view(spark, "WITH " + first.rsplit(",\n       st AS",
-              1)[0] + "\nSELECT v.v, p0.x AS pc0, p1.x AS pc1,"
-              " f0.x AS f0, f1.x AS f1, tt.x AS t,"
-              " p0.x*64 + p1.x*16 + f0.x*8 + f1.x*4 + tt.x*2"
-              " AS s FROM vd v CROSS JOIN pcd p0 CROSS JOIN"
-              " pcd p1 CROSS JOIN bd f0 CROSS JOIN bd f1"
-              " CROSS JOIN bd tt", "q659_st", max_rows=1000)
-    done.append("st")
-    for fr in parts[1:]:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm == "tr" or nm.startswith("r"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q659_{nm}",
-                      max_rows=60000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q660: three-distance theorem + Dirichlet approximation
-
-
-def _q660_sql(tbl: str, d: str, mat: str) -> str:
-    return (
-        f"ab AS{mat} (SELECT CAST((sum(n_chars) % 1000002) + 1"
-        f" AS BIGINT) AS a FROM {tbl}),\n"
-        f"       nd AS (SELECT DISTINCT CAST(doc_id % 49 + 2"
-        f" AS BIGINT) AS n FROM {tbl}),\n"
-        f"       qd AS (SELECT DISTINCT CAST(doc_id % 51"
-        f" AS BIGINT) AS q FROM {tbl}),\n"
-        # the point set {q*alpha} for q < N, per N
-        f"       pt AS{mat} (SELECT n.n, q.q,\n"
-        f"           (q.q*a.a) % 1000003 AS x\n"
-        f"         FROM nd n JOIN qd q ON q.q < n.n"
-        f" CROSS JOIN ab a),\n"
-        f"       rk AS{mat} (SELECT p.n, p.x,\n"
-        f"           CAST(count(*) AS BIGINT) AS r\n"
-        f"         FROM pt p JOIN pt s ON s.n = p.n"
-        f" AND s.x <= p.x\n"
-        f"         GROUP BY p.n, p.x),\n"
-        # circular gaps: successor differences + the wrap gap
-        f"       gp AS{mat} (SELECT a2.n, b.x - a2.x AS g\n"
-        f"         FROM rk a2 JOIN rk b ON b.n = a2.n"
-        f" AND b.r = a2.r + 1\n"
-        f"         UNION ALL\n"
-        f"         SELECT t.n, 1000003 - t.mx + t.mn FROM\n"
-        f"           (SELECT n, max(x) AS mx, min(x) AS mn\n"
-        f"            FROM pt GROUP BY n) t),\n"
-        f"       dg AS{mat} (SELECT n,\n"
-        f"           CAST(count(DISTINCT g) AS BIGINT)"
-        f" AS n_gaps,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_arcs\n"
-        f"         FROM gp GROUP BY n),\n"
-        f"       tv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN n_gaps > 3 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS three_dist_viol,\n"
-        f"           CAST(sum(CASE WHEN n_arcs <> n THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS arc_count_viol\n"
-        f"         FROM dg),\n"
-        # Dirichlet: some q <= N approximates within B/N
-        f"       dr AS{mat} (SELECT n.n,\n"
-        f"           CAST(min(least((q.q*a.a) % 1000003,\n"
-        f"             1000003 - (q.q*a.a) % 1000003))"
-        f" AS BIGINT) AS best\n"
-        f"         FROM nd n JOIN qd q ON q.q >= 1"
-        f" AND q.q <= n.n\n"
-        f"         CROSS JOIN ab a GROUP BY n.n),\n"
-        f"       dv AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           best*n >= 1000003 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS dirichlet_viol FROM dr),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT g.n, g.n_gaps, r.best,\n"
-        f"       t.three_dist_viol, t.arc_count_viol,\n"
-        f"       v.dirichlet_viol, a.a AS alpha_num,\n"
-        f"       l.n_docs\n"
-        f"FROM dg g JOIN dr r ON r.n = g.n\n"
-        f"CROSS JOIN tv t CROSS JOIN dv v CROSS JOIN ab a\n"
-        f"CROSS JOIN ld l")
-
-
-@query("q660_three_distance",
-       "WITH " + _q660_sql("documents", "//", " MATERIALIZED"))
-def q660(spark, sf_dir):
-    """The three-distance theorem and Dirichlet's approximation
-    theorem, verified for every window size on a corpus-derived
-    irrational-acting ratio (Steinhaus/Sós/Świerczkowski 1957,
-    Dirichlet 1842 — why equally-stepped sampling produces at
-    most three distinct spacings, and why good rational
-    approximations always exist; both are pigeonhole made
-    geometric).  The rotation alpha = A/1000003 takes A from the
-    real corpus (q603's construction, gcd 1 by primality); for
-    EVERY N in 2..50 the point set {q*alpha : q < N} materializes
-    on the discrete circle, circular gaps come from a rank
-    self-join plus the wraparound arc, and the theorem holds at
-    every N: never more than three distinct gap lengths
-    (three_dist_viol == 0, with the per-N gap counts emitted —
-    the Fibonacci-adjacent N values show exactly 2, the
-    generic ones 3), and always exactly N arcs
-    (arc_count_viol == 0 — the points are distinct, as gcd
-    promises).  Dirichlet rides the same dims: for every N some
-    q <= N lands within B/N of an integer multiple
-    (dirichlet_viol == 0 via exact cross-multiplication
-    best*N < B) — the q603 convergent machinery's existence
-    guarantee, established by exhaustion at every horizon.
-    Scale: per-N point sets are generated dims; ranking is the
-    q638 cross-multiplied order."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q660_documents")
-    return spark.sql(
-        "WITH " + _q660_sql("q660_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q661: Gilbreath's conjecture — fifteen difference rows in range
-
-
-def _q661_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 401 AS BIGINT)"
-        f" AS n FROM {tbl})",
-        f"sp AS (SELECT CAST(x AS BIGINT) AS x FROM (VALUES"
-        f" (2), (3), (5), (7), (11), (13), (17), (19)) t(x))",
-        f"pr AS (SELECT u.n FROM nd u\n"
-        f"         LEFT JOIN sp s ON u.n % s.x = 0"
-        f" AND u.n <> s.x\n"
-        f"         WHERE u.n >= 2 GROUP BY u.n\n"
-        f"         HAVING count(s.x) = 0)",
-        f"r0 AS (SELECT p.n AS v,\n"
-        f"           CAST(count(*) AS BIGINT) AS idx\n"
-        f"         FROM pr p JOIN pr q ON q.n <= p.n\n"
-        f"         GROUP BY p.n)",
-    ]
-    for k in range(1, 16):
-        parts.append(
-            f"r{k} AS (SELECT abs(b.v - a.v) AS v, a.idx\n"
-            f"         FROM r{k - 1} a JOIN r{k - 1} b\n"
-            f"           ON b.idx = a.idx + 1)")
-    heads = "\n         UNION ALL ".join(
-        f"SELECT CAST({k} AS BIGINT) AS k,"
-        f" CAST(min(v*1024 + idx) {{d}} 1024 AS BIGINT)"
-        f" AS head_ignore, CAST(max(CASE WHEN idx = 1 THEN v"
-        f" END) AS BIGINT) AS head,"
-        f" CAST(max(v) AS BIGINT) AS row_max,"
-        f" CAST(count(*) AS BIGINT) AS row_len FROM r{k}"
-        for k in range(1, 16))
-    parts.append(f"hd AS{{mat}} ({heads})")
-    parts.append(
-        "gv AS (SELECT CAST(sum(CASE WHEN head <> 1 THEN 1"
-        " ELSE 0 END) AS BIGINT) AS gilbreath_viol,\n"
-        "           CAST(sum(CASE WHEN k >= 2 AND row_max % 2"
-        " <> 0 AND row_max <> 1 THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS even_tail_note\n"
-        "         FROM hd)")
-    parts.append(
-        "np AS (SELECT CAST(count(*) AS BIGINT) AS n_primes"
-        " FROM pr)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT h.k, h.head, h.row_max, h.row_len,\n"
-        f"       g.gilbreath_viol, p.n_primes, l.n_docs\n"
-        f"FROM hd h CROSS JOIN gv g CROSS JOIN np p"
-        f" CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q661_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q661_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q661_gilbreath",
-       "WITH " + _q661_join("documents", "//", " MATERIALIZED"))
-def q661(spark, sf_dir):
-    """Gilbreath's conjecture through fifteen difference rows of
-    the primes below 400 — an OPEN conjecture, honestly scoped
-    to its verified range (Proth 1878, Gilbreath 1958; checked
-    far beyond this by Odlyzko, proven by no one).  The 78
-    primes come from the in-plan sieve, ranked by a self-join;
-    each of 15 staged rows takes absolute differences of
-    neighbors (one rank-shift join per stage, rows shrinking by
-    one), and the claim is exactly this: every row's LEADING
-    element is 1 (gilbreath_viol == 0 across all fifteen rows,
-    with each row's head, max, and length emitted — the maxima
-    collapse fast, which is the heuristic reason the conjecture
-    is believed).  The docstring-level honesty matters: this
-    query verifies a conjecture IN RANGE, and says so — same
-    epistemic status as q634's Goldbach sweep, different from
-    the proved theorems elsewhere in this suite; what the plan
-    certifies is that the computation is faithful, not that the
-    pattern continues.  Scale: staged neighbor differencing is
-    a windowed lag in disguise — 15 rounds of the simplest
-    join there is."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q661_documents")
-    parts, fin = _q661_sql("q661_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q661_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm.startswith("r") and nm != "r0":
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q661_{nm}")
-            done.append(nm)
-        elif nm == "r0":
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark,
-                      "WITH " + ",\n ".join(
-                          _qual(p.replace("{mat}", "")
-                                .replace("{d}", "div"))
-                          for p in parts[:3])
-                      + "\n" + body[1:-1].replace(
-                          "SELECT p.n AS v", "SELECT p.n AS v"),
-                      "q661_r0")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q662: pancake sorting — P(6) and connectivity by BFS
-
-
-def _q662_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"n6 AS (SELECT DISTINCT CAST(doc_id % 6 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        "e0 AS (SELECT CAST(0 AS BIGINT) AS vis,"
-        + ", ".join(f" CAST(-1 AS BIGINT) AS d{i}"
-                    for i in range(6))
-        + " FROM n6 WHERE x = 0)",
-    ]
-    for k in range(1, 7):
-        sets = ", ".join(
-            f"CASE WHEN {i} = {k - 1} THEN c.x ELSE e.d{i} END"
-            f" AS d{i}" for i in range(6))
-        parts.append(
-            f"e{k} AS (SELECT e.vis + pw.p AS vis, {sets}\n"
-            f"         FROM e{k - 1} e JOIN n6 c ON true\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES "
-            + ", ".join(f"({x}, {1 << x})" for x in range(6))
-            + f") t(x, p)) pw ON pw.x = c.x\n"
-            f"         WHERE (e.vis {d} pw.p) % 2 = 0)")
-    pack = lambda pre: " + ".join(
-        f"{pre}d{i}*{6 ** (5 - i)}" for i in range(6))
-    parts.append(
-        f"st AS{{mat}} (SELECT d0, d1, d2, d3, d4, d5,"
-        f" {pack('')} AS pk FROM e6)")
-    arms = []
-    for k in range(2, 7):
-        order = list(range(k))[::-1] + list(range(k, 6))
-        expr = " + ".join(
-            f"s.d{order[i]}*{6 ** (5 - i)}" for i in range(6))
-        arms.append(f"SELECT s.pk AS u, {expr} AS v FROM st s")
-    parts.append("mv AS{mat} (" + "\n UNION ALL ".join(arms)
-                 + ")")
-    solved = sum(i * 6 ** (5 - i) for i in range(6))
-    parts.append(
-        f"v0 AS (SELECT CAST({solved} AS BIGINT) AS pk,"
-        f" CAST(0 AS BIGINT) AS dist FROM n6 WHERE x = 0)")
-    for r in range(1, 9):
-        parts.append(
-            f"v{r} AS{{mat}} (SELECT pk, min(dist) AS dist"
-            f" FROM (\n"
-            f"         SELECT pk, dist FROM v{r - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT m.v, w.dist + 1 FROM v{r - 1} w\n"
-            f"         JOIN mv m ON m.u = w.pk) t"
-            f" GROUP BY pk)")
-    parts.append(
-        "rc AS (SELECT CAST(count(*) AS BIGINT)"
-        " AS n_reachable,\n"
-        "           CAST(max(dist) AS BIGINT) AS pancake_6,\n"
-        "           CAST(sum(CASE WHEN dist = 7 THEN 1 ELSE 0"
-        " END) AS BIGINT) AS n_antipodal FROM v8)")
-    parts.append(
-        f"hs AS{{mat}} (SELECT dist, CAST(count(*) AS BIGINT)"
-        f" AS n FROM v8 GROUP BY dist)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT h.dist, h.n, r.n_reachable, r.pancake_6,\n"
-        f"       r.n_antipodal, l.n_docs\n"
-        f"FROM hs h CROSS JOIN rc r CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q662_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q662_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q662_pancake_sorting",
-       "WITH " + _q662_join("documents", "//", " MATERIALIZED"))
-def q662(spark, sf_dir):
-    """Pancake sorting — the 6-stack pancake number and full
-    connectivity by exhaustive BFS (Gates & Papadimitriou 1979,
-    famously Bill Gates's only research paper; prefix reversal
-    is the genome-rearrangement move, and P(n) is its diameter).
-    All 720 stacks enumerate with digits as columns; the five
-    prefix-reversal moves are pure column permutations repacked
-    to base-6 (no loops — a flip is a projection), and BFS from
-    the sorted stack runs eight accumulate-min rounds.  The
-    classical facts: every stack is reachable (n_reachable ==
-    720 — any pancake pile can be sorted, connectivity
-    established rather than assumed), the diameter is
-    pancake_6 == 7 (P(6), matching Gates-Papadimitriou's small
-    cases), and exactly n_antipodal == 2 stacks need all seven
-    flips — the hardest piles, counted.  The full distance
-    histogram (1, 5, 20, 79, 199, 281, 133, 2) is the output —
-    the shape of the Cayley graph of S6 under prefix reversals.
-    Scale: q652's state-space machinery with a different
-    generator set — the move model is data, the search is the
-    same plan."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q662_documents")
-    parts, fin = _q662_sql("q662_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q662_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if (nm in ("n6", "st", "mv", "hs") or nm.startswith("e")
-                or nm.startswith("v")):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q662_{nm}",
-                      max_rows=4000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q663: the 3x3 magic square — uniqueness, structure, and the
-# fifteen-game isomorphism
-
-
-def _q663_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"n9 AS (SELECT DISTINCT CAST(doc_id % 9 + 1"
-        f" AS BIGINT) AS x FROM {tbl})",
-        "g0 AS (SELECT CAST(0 AS BIGINT) AS vis FROM n9"
-        " WHERE x = 1)",
-    ]
-    for k in range(1, 10):
-        prune = ""
-        if k == 3:
-            prune = " AND g.c1 + g.c2 + c.x = 15"
-        if k == 6:
-            prune = " AND g.c4 + g.c5 + c.x = 15"
-        if k == 9:
-            prune = (" AND g.c7 + g.c8 + c.x = 15"
-                     " AND g.c1 + g.c4 + g.c7 = 15"
-                     " AND g.c2 + g.c5 + g.c8 = 15"
-                     " AND g.c3 + g.c6 + c.x = 15"
-                     " AND g.c1 + g.c5 + c.x = 15"
-                     " AND g.c3 + g.c5 + g.c7 = 15")
-        cols = ", ".join(f"g.c{i}" for i in range(1, k)) + (
-            ", " if k > 1 else "")
-        parts.append(
-            f"g{k} AS (SELECT g.vis + pw.p AS vis, {cols}"
-            f"c.x AS c{k}\n"
-            f"         FROM g{k - 1} g JOIN n9 c ON true\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES "
-            + ", ".join(f"({x + 1}, {1 << x})" for x in range(9))
-            + f") t(x, p)) pw ON pw.x = c.x\n"
-            f"         WHERE (g.vis {d} pw.p) % 2 = 0{prune})")
-    # dihedral canonicalization: 8 cell-permutation repacks
-    cellmaps = [
-        [1, 2, 3, 4, 5, 6, 7, 8, 9], [7, 4, 1, 8, 5, 2, 9, 6, 3],
-        [9, 8, 7, 6, 5, 4, 3, 2, 1], [3, 6, 9, 2, 5, 8, 1, 4, 7],
-        [3, 2, 1, 6, 5, 4, 9, 8, 7], [1, 4, 7, 2, 5, 8, 3, 6, 9],
-        [7, 8, 9, 4, 5, 6, 1, 2, 3], [9, 6, 3, 8, 5, 2, 7, 4, 1],
-    ]
-    packs = []
-    for mp in cellmaps:
-        packs.append(" + ".join(
-            f"m.c{mp[i]}*{10 ** (8 - i)}" for i in range(9)))
-    parts.append(
-        f"mg AS{{mat}} (SELECT c1, c2, c3, c4, c5, c6, c7, c8,"
-        f" c9,\n"
-        f"           least(" + ", ".join(packs) + ") AS canon\n"
-        f"         FROM g9 m)")
-    parts.append(
-        "agg AS (SELECT CAST(count(*) AS BIGINT) AS n_magic,\n"
-        "           CAST(count(DISTINCT canon) AS BIGINT)"
-        " AS n_orbits,\n"
-        "           CAST(min(c5) AS BIGINT) AS center_min,\n"
-        "           CAST(max(c5) AS BIGINT) AS center_max,\n"
-        "           CAST(sum(c1 % 2 + c3 % 2 + c7 % 2 + c9 % 2)"
-        " AS BIGINT) AS odd_corner_count\n"
-        "         FROM mg)")
-    # the fifteen-game isomorphism: 15-sum triples == 8 == the
-    # winning lines of (any) one magic square, as sets
-    parts.append(
-        "tp AS{mat} (SELECT a.x AS t1, b.x AS t2, c.x AS t3\n"
-        "         FROM n9 a JOIN n9 b ON b.x > a.x\n"
-        "         JOIN n9 c ON c.x > b.x\n"
-        "         WHERE a.x + b.x + c.x = 15)")
-    own = " + ".join(f"c{i + 1}*{10 ** (8 - i)}"
-                     for i in range(9))
-    parts.append(
-        f"one AS (SELECT * FROM mg WHERE ({own}) = canon)")
-    parts.append(
-        "lns AS{mat} (SELECT least(a, b, c) AS t1,\n"
-        "           a + b + c - least(a, b, c) -"
-        " greatest(a, b, c) AS t2,\n"
-        "           greatest(a, b, c) AS t3 FROM (\n"
-        "         SELECT c1 AS a, c2 AS b, c3 AS c FROM one\n"
-        "         UNION ALL SELECT c4, c5, c6 FROM one\n"
-        "         UNION ALL SELECT c7, c8, c9 FROM one\n"
-        "         UNION ALL SELECT c1, c4, c7 FROM one\n"
-        "         UNION ALL SELECT c2, c5, c8 FROM one\n"
-        "         UNION ALL SELECT c3, c6, c9 FROM one\n"
-        "         UNION ALL SELECT c1, c5, c9 FROM one\n"
-        "         UNION ALL SELECT c3, c5, c7 FROM one) t)")
-    parts.append(
-        "bij AS (SELECT\n"
-        "           CAST((SELECT count(*) FROM tp) AS BIGINT)"
-        " AS n_triples,\n"
-        "           CAST((SELECT count(*) FROM lns l JOIN tp t\n"
-        "             ON t.t1 = l.t1 AND t.t2 = l.t2"
-        " AND t.t3 = l.t3) AS BIGINT) AS n_matched,\n"
-        "           CAST((SELECT count(DISTINCT l.t1*100 +"
-        " l.t2*10 + l.t3) FROM lns l) AS BIGINT)"
-        " AS n_distinct_lines)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT a.n_magic, a.n_orbits, a.center_min,\n"
-        f"       a.center_max, a.odd_corner_count,\n"
-        f"       b.n_triples, b.n_matched, b.n_distinct_lines,\n"
-        f"       l.n_docs\n"
-        f"FROM agg a CROSS JOIN bij b CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q663_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q663_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q663_magic_square",
-       "WITH " + _q663_join("documents", "//", " MATERIALIZED"))
-def q663(spark, sf_dir):
-    """The 3x3 magic square — uniqueness up to symmetry, forced
-    structure, and the fifteen-game/tic-tac-toe isomorphism, all
-    by exhaustion (Lo Shu, ~2000 BCE by legend; the isomorphism
-    is how game theorists teach representation: Pick-15 IS
-    tic-tac-toe).  Staged placement with magic pruning (row sums
-    checked the moment each row completes, columns and diagonals
-    at the last cell) cuts 9! to a handful of survivors:
-    n_magic == 8 squares exist, they form ONE dihedral orbit
-    (n_orbits == 1 under the 8 cell-permutation repacks — the
-    Lo Shu is unique up to rotation and reflection), the center
-    is ALWAYS 5 (center_min == center_max == 5) and every corner
-    even (odd_corner_count == 0) — the forced structure usually
-    proved by little parity arguments, here read off the
-    complete solution set.  The isomorphism: exactly
-    n_triples == 8 three-subsets of 1..9 sum to 15, and the 8
-    winning LINES of the canonical square match them one-to-one
-    (n_matched == 8 == n_distinct_lines) — so claiming numbers
-    summing to 15 is literally claiming a tic-tac-toe line,
-    q632's game wearing arithmetic clothes.  Scale:
-    prune-as-you-place staged enumeration — constraint
-    propagation inside the join chain, the q641 discipline."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q663_documents")
-    parts, fin = _q663_sql("q663_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q663_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if (nm in ("n9", "mg", "tp", "one", "lns")
-                or nm.startswith("g")):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q663_{nm}",
-                      max_rows=40000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q664: Stern/Calkin-Wilf — every positive rational exactly once
-
-
-def _q664_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 257 AS BIGINT)"
-        f" AS n FROM {tbl})",
-        f"dv AS (SELECT DISTINCT CAST(doc_id % 54 + 2"
-        f" AS BIGINT) AS g FROM {tbl})",
-        "l0 AS (SELECT CAST(1 AS BIGINT) AS n, CAST(1 AS"
-        " BIGINT) AS v FROM nd WHERE n = 1\n"
-        "         UNION ALL SELECT 0, 0 FROM nd WHERE n = 1)",
-    ]
-    for k in range(1, 10):
-        parts.append(
-            f"ev{k} AS (SELECT n, v FROM l{k - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT 2*a.n, a.v FROM l{k - 1} a\n"
-            f"         WHERE a.n >= {1 << (k - 1)}"
-            f" AND a.n < {1 << k})")
-        parts.append(
-            f"l{k} AS (SELECT n, v FROM ev{k}\n"
-            f"         UNION ALL\n"
-            f"         SELECT 2*a.n + 1, a.v + b.v\n"
-            f"         FROM l{k - 1} a JOIN ev{k} b"
-            f" ON b.n = a.n + 1\n"
-            f"         WHERE a.n >= {1 << (k - 1)}"
-            f" AND a.n < {1 << k})")
-    parts.append(
-        f"pr AS{{mat}} (SELECT a.n, a.v AS p, b.v AS q,\n"
-        f"           c.v AS r\n"
-        f"         FROM l9 a JOIN l9 b ON b.n = a.n + 1\n"
-        f"         JOIN l9 c ON c.n = a.n + 2\n"
-        f"         WHERE a.n BETWEEN 1 AND 256)")
-    parts.append(
-        "cpv AS (SELECT CAST(sum(CASE WHEN t.shared > 0 THEN 1"
-        " ELSE 0 END) AS BIGINT) AS coprime_viol FROM (\n"
-        "         SELECT p2.n, count(g.g) AS shared\n"
-        "         FROM pr p2 LEFT JOIN dv g\n"
-        "           ON p2.p % g.g = 0 AND p2.q % g.g = 0\n"
-        "         GROUP BY p2.n) t)")
-    parts.append(
-        "dst AS (SELECT CAST(count(DISTINCT p*1024 + q)"
-        " AS BIGINT) AS n_distinct,\n"
-        "           CAST(count(*) AS BIGINT) AS n_pairs"
-        " FROM pr)")
-    # coverage: every reduced fraction with p, q <= 8 appears
-    parts.append(
-        "nee AS (SELECT a.g - 1 AS p, b.g - 1 AS q\n"
-        "         FROM (SELECT g FROM dv WHERE g <= 9) a\n"
-        "         JOIN (SELECT g FROM dv WHERE g <= 9) b"
-        " ON true\n"
-        "         LEFT JOIN dv g ON (a.g - 1) % g.g = 0"
-        " AND (b.g - 1) % g.g = 0\n"
-        "         GROUP BY a.g - 1, b.g - 1\n"
-        "         HAVING count(g.g) = 0)")
-    parts.append(
-        "cov AS (SELECT CAST(count(*) AS BIGINT) AS n_needed,\n"
-        "           CAST(sum(CASE WHEN x.n IS NULL THEN 1"
-        " ELSE 0 END) AS BIGINT) AS missing\n"
-        "         FROM nee e LEFT JOIN (SELECT min(n) AS n, p,"
-        " q FROM pr GROUP BY p, q) x\n"
-        "           ON x.p = e.p AND x.q = e.q)")
-    # Newman's successor formula at every step
-    parts.append(
-        f"nwm AS (SELECT CAST(sum(CASE WHEN r <>\n"
-        f"           (2*(p {{d}} q) + 1)*q - p THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS newman_viol FROM pr)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT c.coprime_viol, s.n_distinct, s.n_pairs,\n"
-        f"       v.n_needed, v.missing, w.newman_viol,\n"
-        f"       l.n_docs\n"
-        f"FROM cpv c CROSS JOIN dst s CROSS JOIN cov v\n"
-        f"CROSS JOIN nwm w CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q664_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q664_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin.replace("{d}", d)
-
-
-@query("q664_calkin_wilf",
-       "WITH " + _q664_join("documents", "//", " MATERIALIZED"))
-def q664(spark, sf_dir):
-    """Stern's diatomic sequence and the Calkin-Wilf enumeration
-    of the rationals — the bijection's working parts verified at
-    every index (Stern 1858, Calkin-Wilf 2000, Newman 2003; the
-    'count the rationals without ever reducing a fraction'
-    construction).  The sequence builds level by level (nine
-    doubling stages: s(2n) = s(n) by projection, s(2n+1) =
-    s(n) + s(n+1) by a shift join), and the first 256
-    consecutive pairs (s(n), s(n+1)) carry the theorems:
-    coprime_viol == 0 — every pair is automatically REDUCED (the
-    gcd invariant of the recurrence, checked by shared-divisor
-    anti-join); n_distinct == 256 — no rational ever repeats
-    (injectivity); every reduced fraction with numerator and
-    denominator at most 8 has already appeared (missing == 0 of
-    n_needed — completeness sampled on a finite square, honestly
-    scoped); and NEWMAN's closed-form successor holds at every
-    single step — s(n+2) == (2*floor(s(n)/s(n+1)) + 1)*s(n+1) -
-    s(n) (newman_viol == 0), the magic 'next rational from
-    current one' formula as 256 integer identities.  Scale:
-    level-doubling generation is the q626 parallel-scan shape;
-    the checks are one join each."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q664_documents")
-    parts, fin = _q664_sql("q664_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q664_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("nd", "dv", "pr") or nm.startswith("l") \
-                or nm.startswith("ev"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q664_{nm}",
-                      max_rows=2000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin.replace("{d}", "div")))
-
-
-# ---------------------------------------------------------------------------
-# q665: Fibonacci gcd identity — batched Euclid over all pairs
-
-
-def _q665_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"md AS (SELECT DISTINCT CAST(doc_id % 30 + 1"
-        f" AS BIGINT) AS m FROM {tbl})",
-        "f0 AS (SELECT CAST(1 AS BIGINT) AS k, CAST(1 AS"
-        " BIGINT) AS a, CAST(1 AS BIGINT) AS b)",
-    ]
-    # Fibonacci table in 5 pin-batches of 6 linear steps
-    for k in range(1, 31):
-        parts.append(
-            f"f{k} AS (SELECT k + 1 AS k, b AS a, a + b AS b"
-            f" FROM f{k - 1})")
-    ftab = "\n         UNION ALL ".join(
-        f"SELECT k, a AS f FROM f{k}" for k in range(31))
-    parts.append(f"ft AS{{mat}} ({ftab})")
-    # batched double Euclid: gcd(F_m, F_n) and gcd(m, n)
-    parts.append(
-        "g0 AS (SELECT x.m, y.m AS n, fa.f AS a1, fb.f AS b1,\n"
-        "           x.m AS a2, y.m AS b2\n"
-        "         FROM md x JOIN md y ON true\n"
-        "         JOIN ft fa ON fa.k = x.m\n"
-        "         JOIN ft fb ON fb.k = y.m)")
-    for k in range(1, 31):
-        parts.append(
-            f"g{k} AS (SELECT m, n,\n"
-            f"           CASE WHEN b1 = 0 THEN a1 ELSE b1 END"
-            f" AS a1,\n"
-            f"           CASE WHEN b1 = 0 THEN 0 ELSE a1 % b1"
-            f" END AS b1,\n"
-            f"           CASE WHEN b2 = 0 THEN a2 ELSE b2 END"
-            f" AS a2,\n"
-            f"           CASE WHEN b2 = 0 THEN 0 ELSE a2 % b2"
-            f" END AS b2\n"
-            f"         FROM g{k - 1})")
-    parts.append(
-        f"gf AS{{mat}} (SELECT m, n, a1 AS gcd_f, a2 AS gcd_i\n"
-        f"         FROM g30)")
-    parts.append(
-        "idv AS (SELECT CAST(sum(CASE WHEN g.gcd_f <> t.f"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS gcd_ident_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_pairs\n"
-        "         FROM gf g JOIN ft t ON t.k = g.gcd_i)")
-    parts.append(
-        "cas AS (SELECT CAST(sum(CASE WHEN\n"
-        "           p.f*q.f - c.f*c.f <>\n"
-        "           CASE WHEN c.k % 2 = 0 THEN 1 ELSE -1 END\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS cassini_viol\n"
-        "         FROM ft c JOIN ft p ON p.k = c.k - 1\n"
-        "         JOIN ft q ON q.k = c.k + 1)")
-    parts.append(
-        "dvb AS (SELECT CAST(sum(CASE WHEN\n"
-        "           (CASE WHEN g.n % g.m = 0 THEN 1 ELSE 0 END)"
-        " <>\n"
-        "           (CASE WHEN fn.f % fm.f = 0 THEN 1 ELSE 0"
-        " END)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS divis_viol\n"
-        "         FROM gf g JOIN ft fm ON fm.k = g.m\n"
-        "         JOIN ft fn ON fn.k = g.n\n"
-        "         WHERE g.m >= 3 AND g.n >= g.m)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT i.gcd_ident_viol, i.n_pairs, c.cassini_viol,\n"
-        f"       v.divis_viol, l.n_docs\n"
-        f"FROM idv i CROSS JOIN cas c CROSS JOIN dvb v"
-        f" CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q665_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q665_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q665_fibonacci_gcd",
-       "WITH " + _q665_join("documents", "//", " MATERIALIZED"))
-def q665(spark, sf_dir):
-    """The Fibonacci gcd identity — gcd(F_m, F_n) == F_gcd(m,n)
-    — verified over ALL 900 index pairs by batched Euclid, with
-    Cassini and the divisibility biconditional riding along
-    (Lucas 1876; the identity that makes Fibonacci numbers a
-    'strong divisibility sequence', and the reason consecutive
-    Fibonaccis are Euclid's worst case).  The table F_1..F_31
-    builds by a linear chain; then every (m, n) pair runs TWO
-    Euclids in lockstep — one on (F_m, F_n), one on (m, n) —
-    through 30 frozen-guarded stages (consecutive-Fibonacci
-    pairs genuinely need 29 steps: the fixture contains Lamé's
-    extremal case by construction), and gcd_ident_viol == 0 ties
-    them through the F table on every pair: the gcd of the
-    VALUES is the value of the gcd of the INDICES.  Cassini's
-    identity F_{n-1} F_{n+1} - F_n^2 == (-1)^n holds at every n
-    (cassini_viol == 0, exact BIGINT products), and the
-    divisibility BICONDITIONAL m | n <=> F_m | F_n holds for
-    every pair with m >= 3 (divis_viol == 0 — and m = 2 is
-    precisely the classical exception, excluded by the theorem's
-    own statement, since F_2 = 1 divides everything).  Scale:
-    900 independent Euclids in lockstep is the q617 batch-
-    simulation shape; the identities are joins over a 31-row
-    dim."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q665_documents")
-    parts, fin = _q665_sql("q665_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q665_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("md", "ft", "gf") or nm.startswith("f") or \
-                nm.startswith("g"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q665_{nm}",
-                      max_rows=1000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q666: Collatz in range — stopping times via functional closure
-
-
-def _q666_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"nd AS (SELECT DISTINCT a.x*97 + b.x + 1 AS n\n"
-        f"         FROM (SELECT CAST(doc_id % 96 AS BIGINT)"
-        f" AS x FROM {tbl}) a\n"
-        f"         CROSS JOIN (SELECT CAST(doc_id % 97"
-        f" AS BIGINT) AS x FROM {tbl}) b\n"
-        f"         WHERE a.x*97 + b.x + 1 <= 9232)",
-        f"eg AS (SELECT n AS u,\n"
-        f"           CASE WHEN n % 2 = 0 THEN n {{d}} 2\n"
-        f"             ELSE 3*n + 1 END AS v\n"
-        f"         FROM nd WHERE n > 1)",
-        "c0 AS (SELECT n AS a, n AS b, CAST(0 AS BIGINT) AS dd"
-        " FROM nd\n"
-        "         UNION ALL SELECT u, v, 1 FROM eg)",
-    ]
-    for k in range(1, 9):
-        parts.append(
-            f"c{k} AS (SELECT a, b, min(dd) AS dd FROM (\n"
-            f"         SELECT a, b, dd FROM c{k - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT x.a, y.b, x.dd + y.dd\n"
-            f"         FROM c{k - 1} x JOIN c{k - 1} y\n"
-            f"           ON y.a = x.b) t GROUP BY a, b)")
-    parts.append(
-        f"st AS{{mat}} (SELECT c.a AS n, c.dd AS stopping\n"
-        f"         FROM c8 c WHERE c.b = 1 AND c.a <= 100)")
-    parts.append(
-        f"exc AS{{mat}} (SELECT c.a AS n, CAST(max(c.b)"
-        f" AS BIGINT) AS peak\n"
-        f"         FROM c8 c WHERE c.a <= 100 GROUP BY c.a)")
-    parts.append(
-        "agg AS (SELECT\n"
-        "           CAST(count(*) AS BIGINT) AS n_reaching_1,\n"
-        "           CAST(max(stopping*128 + n) {d} 128"
-        " AS BIGINT) AS max_steps,\n"
-        "           CAST(max(stopping*128 + n) % 128 AS BIGINT)"
-        " AS argmax_steps\n"
-        "         FROM st)")
-    parts.append(
-        "exa AS (SELECT\n"
-        "           CAST(max(peak*256 + (255 - n)) {d} 256"
-        " AS BIGINT) AS max_peak,\n"
-        "           CAST(255 - max(peak*256 + (255 - n)) % 256"
-        " AS BIGINT) AS first_at_peak,\n"
-        "           CAST(sum(CASE WHEN peak = 9232 THEN 1"
-        " ELSE 0 END) AS BIGINT) AS n_at_peak\n"
-        "         FROM exc)")
-    parts.append(
-        f"hs AS{{mat}} (SELECT stopping {{d}} 20 AS blk,\n"
-        f"           CAST(count(*) AS BIGINT) AS n"
-        f" FROM st GROUP BY stopping {{d}} 20)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT h.blk, h.n,\n"
-        f"       a.n_reaching_1, 100 - a.n_reaching_1"
-        f" AS collatz_viol,\n"
-        f"       a.max_steps, a.argmax_steps,\n"
-        f"       x.max_peak, x.first_at_peak, x.n_at_peak,"
-        f" l.n_docs\n"
-        f"FROM hs h CROSS JOIN agg a CROSS JOIN exa x"
-        f" CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q666_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q666_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return (",\n       ".join(out) + "\n"
-            + fin.replace(" div ", f" {d} "))
-
-
-@query("q666_collatz_range",
-       "WITH " + _q666_join("documents", "//", " MATERIALIZED"))
-def q666(spark, sf_dir):
-    """Collatz stopping times for every start below 100 —
-    computed by CLOSURE over the functional graph, not by
-    iterating, and honestly framed as an in-range check of an
-    open conjecture (Collatz 1937; the 3n+1 problem).  The graph
-    puts one edge n -> n/2 or 3n+1 at every n up to 9232 (the
-    proven excursion ceiling for these starts — the bound is
-    itself an output), and eight min-plus doubling stages close
-    it: because the graph is FUNCTIONAL, the closure from each
-    source is exactly its trajectory, so distances are stopping
-    times and reachable sets are excursion profiles, all 100
-    trajectories resolved simultaneously in logarithmic rounds
-    rather than 118 sequential steps.  The classical landmarks
-    land exactly: every start reaches 1 (collatz_viol == 0 — the
-    conjecture verified to 100, no more), the slowest is n == 97
-    at 118 steps (packed argmax), and the famous peak 9232 is first attained
-    at n == 27 (first_at_peak == 27, with n_at_peak sources
-    sharing it — 97's longer trajectory passes through the same
-    summit, which is exactly why 'argmax by packed tiebreak'
-    said 97 on the first cut: many starts share one peak, and
-    27 is the CANONICAL one because it is the smallest).  The stopping-time
-    histogram in blocks of 20 is the output.  Scale: functional-
-    graph doubling turns per-element iteration into log-depth
-    closure — the trick that batches a million trajectories.
-
-    Round-5 engine restructure (the r4 verdict's #2): the former
-    engine pinned the PAIR closure c0..c8 — up to ~230k (a, b)
-    rows collected to the driver per stage, 13.1 s of pin
-    traffic.  Because the graph is FUNCTIONAL, the closure is a
-    jump TABLE, not a relation: one row per node carrying
-    (f^2^k(n), steps-before-absorption, trajectory max), frozen
-    at 1, composed by 7 self-join stages that stay 9232 rows
-    forever — the same log-depth batching with O(nodes) state
-    instead of O(pairs), which is the version that survives a
-    million trajectories.  stopping = cnt where dst = 1, peak =
-    the composed max; identical values, certified by the
-    unchanged pair-closure oracle."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q666_documents")
-    parts, fin = _q666_sql("q666_documents", "div", "")
-    frs = {}
-    for p in parts:
-        p = p.replace("{mat}", "").replace("{d}", "div")
-        frs[p.split(" AS ", 1)[0].strip()] = p
-    nd_body = frs["nd"].split(" AS ", 1)[1].strip()
-    _pin_view(spark, nd_body[1:-1], "q666_nd", max_rows=10000)
-    g0 = ("SELECT n.n, coalesce(e.v, n.n) AS dst,\n"
-          "         CAST(CASE WHEN e.v IS NULL THEN 0 ELSE 1 END"
-          " AS BIGINT) AS cnt,\n"
-          "         greatest(n.n, coalesce(e.v, n.n)) AS mx\n"
-          "       FROM q666_nd n\n"
-          "       LEFT JOIN (SELECT n AS u,\n"
-          "           CASE WHEN n % 2 = 0 THEN n div 2\n"
-          "             ELSE 3*n + 1 END AS v\n"
-          "         FROM q666_nd WHERE n > 1) e ON e.u = n.n")
-    _pin_view(spark, g0, "q666_g0", max_rows=10000)
-    for k in range(1, 8):
-        _pin_view(
-            spark,
-            f"SELECT x.n, y.dst, x.cnt + y.cnt AS cnt,\n"
-            f"         greatest(x.mx, y.mx) AS mx\n"
-            f"       FROM q666_g{k - 1} x\n"
-            f"       JOIN q666_g{k - 1} y ON y.n = x.dst",
-            f"q666_g{k}", max_rows=10000)
-    spark.sql("SELECT n, cnt AS stopping FROM q666_g7\n"
-              "       WHERE dst = 1 AND n <= 100") \
-        .createOrReplaceTempView("q666_st")
-    spark.sql("SELECT n, mx AS peak FROM q666_g7"
-              " WHERE n <= 100") \
-        .createOrReplaceTempView("q666_exc")
-    done = ["st", "exc"]
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q666_{nm}", text)
-        return text
-
-    kept = [_qual(frs[nm]) for nm in ("agg", "exa", "hs", "ld")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q667: Kaprekar's constant — all four-digit numbers funnel to 6174
-
-
-def _q667_sql(tbl: str, d: str, mat: str) -> str:
-    # digit extraction and a 5-comparator sorting network for 4
-    digs = ("(x {d} 1000) % 10", "(x {d} 100) % 10",
-            "(x {d} 10) % 10", "x % 10")
-    return (
-        f"nd AS (SELECT DISTINCT a.x*100 + b.x AS x\n"
-        f"         FROM (SELECT CAST(doc_id % 100 AS BIGINT)"
-        f" AS x FROM {tbl}) a\n"
-        f"         CROSS JOIN (SELECT CAST(doc_id % 100"
-        f" AS BIGINT) AS x FROM {tbl}) b),\n"
-        f"       k0 AS (SELECT x AS n0, x,"
-        f" CAST(0 AS BIGINT) AS steps,\n"
-        f"           CAST(CASE WHEN ({digs[0]}) = ({digs[1]})\n"
-        f"             AND ({digs[1]}) = ({digs[2]})\n"
-        f"             AND ({digs[2]}) = ({digs[3]})"
-        f" THEN 1 ELSE 0 END AS BIGINT) AS repdig\n"
-        f"         FROM nd),\n"
-        + ",\n       ".join(
-            f"k{k} AS (SELECT n0, CASE WHEN repdig = 1 OR"
-            f" x = 6174 THEN x ELSE\n"
-            f"           (s3*1000 + s2*100 + s1*10 + s0)\n"
-            f"           - (s0*1000 + s1*100 + s2*10 + s3) END"
-            f" AS x,\n"
-            f"           CASE WHEN repdig = 1 OR x = 6174 THEN"
-            f" steps ELSE steps + 1 END AS steps, repdig"
-            f" FROM (\n"
-            f"         SELECT n0, x, steps, repdig,\n"
-            f"           least(l0, l1) AS s0,\n"
-            f"           least(greatest(l0, l1),"
-            f" least(h0, h1)) AS s1,\n"
-            f"           greatest(greatest(l0, l1),"
-            f" least(h0, h1)) AS s2,\n"
-            f"           greatest(h0, h1) AS s3 FROM (\n"
-            f"           SELECT n0, x, steps, repdig,\n"
-            f"             least(({digs[0]}), ({digs[2]}))"
-            f" AS l0,\n"
-            f"             least(({digs[1]}), ({digs[3]}))"
-            f" AS l1,\n"
-            f"             greatest(({digs[0]}), ({digs[2]}))"
-            f" AS h0,\n"
-            f"             greatest(({digs[1]}), ({digs[3]}))"
-            f" AS h1\n"
-            f"           FROM k{k - 1}) u) w)"
-            for k in range(1, 9)) + ",\n"
-        f"       agg AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN repdig = 0 AND"
-        f" x <> 6174\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS kaprekar_viol,\n"
-        f"           CAST(max(CASE WHEN repdig = 0 THEN steps"
-        f" END) AS BIGINT) AS max_steps,\n"
-        f"           CAST(sum(CASE WHEN repdig = 1 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS n_repdigits,\n"
-        f"           CAST(sum(CASE WHEN repdig = 1 AND x = n0\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS repdig_frozen\n"
-        f"         FROM k8),\n"
-        f"       fx AS (SELECT CAST(x AS BIGINT) AS fixed_point\n"
-        f"         FROM k8 WHERE n0 = 6174),\n"
-        f"       hs AS{mat} (SELECT steps,"
-        f" CAST(count(*) AS BIGINT) AS n\n"
-        f"         FROM k8 WHERE repdig = 0 GROUP BY steps),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT h.steps, h.n,\n"
-        f"       a.kaprekar_viol, a.max_steps, a.n_repdigits,\n"
-        f"       a.repdig_frozen, f.fixed_point, l.n_docs\n"
-        f"FROM hs h CROSS JOIN agg a CROSS JOIN fx f"
-        f" CROSS JOIN ld l").replace("{d}", d)
-
-
-@query("q667_kaprekar",
-       "WITH " + _q667_sql("documents", "//", " MATERIALIZED"))
-def q667(spark, sf_dir):
-    """Kaprekar's constant — every four-digit number funnels to
-    6174, proven by running ALL of them (Kaprekar 1949; the
-    arithmetic attractor every recreational-math reader meets,
-    here a 10,000-way batch iteration).  The full universe
-    0000..9999 builds from doc-residue dims; each of eight
-    staged rounds sorts the four digits with a FIVE-COMPARATOR
-    sorting network (q619's least/greatest discipline — no
-    array sort) and subtracts ascending from descending, with
-    repdigits and arrived numbers frozen.  The theorem lands
-    whole: kaprekar_viol == 0 — every one of the 9990
-    non-repdigit numbers sits at 6174 after at most
-    max_steps == 7 rounds (the known worst case, attained);
-    6174 itself is a FIXED POINT (fixed_point == 6174 — the
-    routine maps it to itself); the n_repdigits == 10 excluded
-    numbers are exactly the frozen class (their one subtraction
-    would give 0, which is why the theorem excludes them); and
-    the step histogram 1, 383, 576, 2400, 1272, 1518, 1656,
-    2184 profiles the attractor's basin.  Scale: one linear
-    8-stage chain over the whole universe — per-row arithmetic,
-    no joins after the dim build, the purest batch-iteration
-    shape in the suite."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q667_documents")
-    return spark.sql(
-        "WITH " + _q667_sql("q667_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q668: Ford circles + Descartes/Apollonian integrality
-
-
-def _q668_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"n9 AS (SELECT DISTINCT CAST(doc_id % 9 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        f"fr AS (SELECT p.x AS p, q.x AS q\n"
-        f"         FROM n9 p JOIN n9 q ON q.x >= 1"
-        f" AND p.x <= q.x\n"
-        f"         LEFT JOIN (SELECT x FROM n9 WHERE x >= 2) g\n"
-        f"           ON p.x % g.x = 0 AND q.x % g.x = 0\n"
-        f"         GROUP BY p.x, q.x HAVING count(g.x) = 0)",
-        # all pairs: geometric tangency vs unimodularity, exact
-        f"pp AS{{mat}} (SELECT a.p, a.q, b.p AS r, b.q AS s,\n"
-        f"           (a.p*b.q - a.q*b.p)*(a.p*b.q - a.q*b.p)"
-        f" AS uni2,\n"
-        f"           4*a.q*a.q*b.q*b.q*\n"
-        f"             (a.p*b.q - a.q*b.p)*(a.p*b.q - a.q*b.p)\n"
-        f"           + (b.q*b.q - a.q*a.q)*(b.q*b.q - a.q*a.q)"
-        f" AS geo_lhs,\n"
-        f"           (b.q*b.q + a.q*a.q)*(b.q*b.q + a.q*a.q)"
-        f" AS geo_rhs\n"
-        f"         FROM fr a JOIN fr b\n"
-        f"           ON a.p*b.q < b.p*a.q OR\n"
-        f"             (a.p*b.q = b.p*a.q AND a.q < b.q))",
-        f"tv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN (CASE WHEN geo_lhs ="
-        f" geo_rhs\n"
-        f"             THEN 1 ELSE 0 END) <> (CASE WHEN uni2 = 1"
-        f"\n"
-        f"             THEN 1 ELSE 0 END) THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS tangency_viol,\n"
-        f"           CAST(sum(CASE WHEN geo_lhs < geo_rhs"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS overlap_viol,\n"
-        f"           CAST(sum(CASE WHEN uni2 = 1 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_tangent,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_pairs"
-        f" FROM pp)",
-        # Apollonian gasket: 3 generations from (-1, 2, 2, 3)
-        "a0 AS (SELECT CAST(-1 AS BIGINT) AS k1, CAST(2 AS"
-        " BIGINT) AS k2,\n"
-        "           CAST(2 AS BIGINT) AS k3, CAST(3 AS BIGINT)"
-        " AS k4)",
-    ]
-    for g in range(1, 4):
-        arms = []
-        for i in range(4):
-            ks = ["k1", "k2", "k3", "k4"]
-            others = [k for j, k in enumerate(ks) if j != i]
-            new = f"2*({' + '.join(others)}) - {ks[i]}"
-            sel = []
-            for j, k in enumerate(ks):
-                sel.append(f"({new}) AS {k}" if j == i else k)
-            arms.append(f"SELECT {', '.join(sel)} FROM a{g - 1}")
-        parts.append(
-            f"a{g} AS (SELECT k1, k2, k3, k4 FROM a{g - 1}\n"
-            f"         UNION ALL " + "\n UNION ALL ".join(arms)
-            + ")")
-    # sort each quadruple with the q619 network, dedup, verify
-    srt = (
-        "SELECT least(l0, l1) AS s1,\n"
-        "       least(greatest(l0, l1), least(h0, h1)) AS s2,\n"
-        "       greatest(greatest(l0, l1), least(h0, h1))"
-        " AS s3,\n"
-        "       greatest(h0, h1) AS s4 FROM (\n"
-        "   SELECT least(k1, k3) AS l0, least(k2, k4) AS l1,\n"
-        "          greatest(k1, k3) AS h0, greatest(k2, k4)"
-        " AS h1 FROM a3) u")
-    parts.append(f"qd AS{{mat}} (SELECT DISTINCT s1, s2, s3, s4"
-                 f" FROM ({srt}) t)")
-    parts.append(
-        "dv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN\n"
-        "             (s1 + s2 + s3 + s4)*(s1 + s2 + s3 + s4)"
-        " <>\n"
-        "             2*(s1*s1 + s2*s2 + s3*s3 + s4*s4)\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS descartes_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_quadruples,\n"
-        "           CAST(max(s4) AS BIGINT) AS max_curvature\n"
-        "         FROM qd)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT t.tangency_viol, t.overlap_viol, t.n_tangent,\n"
-        f"       t.n_pairs, v.descartes_viol, v.n_quadruples,\n"
-        f"       v.max_curvature, l.n_docs\n"
-        f"FROM tv t CROSS JOIN dv v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q668_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q668_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q668_ford_apollonian",
-       "WITH " + _q668_join("documents", "//", " MATERIALIZED"))
-def q668(spark, sf_dir):
-    """Ford circles and the Apollonian gasket — tangency is
-    unimodularity, and curvatures stay integers, both verified
-    exhaustively (Ford 1938, Descartes 1643, the Apollonian
-    integrality observed by Soddy 1936).  Over every pair of the
-    23 Farey(8) fractions, the EXACT geometric tangency test —
-    center distance squared equals summed radii squared, all
-    denominators cleared to the integer identity
-    4 q^2 s^2 (ps - qr)^2 + (s^2 - q^2)^2 vs (s^2 + q^2)^2 —
-    agrees with |ps - qr| == 1 on all 253 pairs
-    (tangency_viol == 0, n_tangent == 43): Ford circles kiss
-    EXACTLY at Farey unimodularity, q638's determinant condition
-    wearing geometry.  No pair ever overlaps (overlap_viol == 0
-    — the circles form a genuine packing, the inequality side of
-    the same cleared identity).  The Descartes side: from the
-    integer root quadruple (-1, 2, 2, 3), three generations of
-    the reflection k -> 2(sum of others) - k generate
-    n_quadruples == 22 distinct sorted quadruples (q619-network
-    sort + dedup), EVERY one satisfying Descartes' equation
-    (sum k)^2 == 2 sum k^2 exactly (descartes_viol == 0) with
-    all curvatures integers up to max_curvature — the famous
-    integral Apollonian packing growing in-plan.  Scale: pair
-    algebra over broadcast dims; the gasket generations are
-    4-way unions with network-sort dedup."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q668_documents")
-    parts, fin = _q668_sql("q668_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q668_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("n9", "fr", "pp", "qd") or nm.startswith("a"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q668_{nm}",
-                      max_rows=2000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q669: Eulerian numbers — census, recurrence, Worpitzky
-
-
-def _q669_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"n7 AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS x FROM {tbl})",
-    ]
-    for n, tag in ((6, "s"), (7, "e")):
-        parts.append(
-            f"{tag}0 AS (SELECT CAST(0 AS BIGINT) AS vis,"
-            f" CAST(-1 AS BIGINT) AS lst,\n"
-            f"           CAST(0 AS BIGINT) AS dsc"
-            f" FROM n7 WHERE x = 0)")
-        for k in range(1, n + 1):
-            parts.append(
-                f"{tag}{k} AS (SELECT e.vis + pw.p AS vis,"
-                f" c.x AS lst,\n"
-                f"           e.dsc + CASE WHEN e.lst > c.x"
-                f" THEN 1 ELSE 0 END AS dsc\n"
-                f"         FROM {tag}{k - 1} e JOIN n7 c"
-                f" ON c.x < {n}\n"
-                f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-                f" CAST(p AS BIGINT) AS p FROM (VALUES "
-                + ", ".join(f"({x}, {1 << x})" for x in range(7))
-                + f") t(x, p)) pw ON pw.x = c.x\n"
-                f"         WHERE (e.vis {{d}} pw.p) % 2 = 0)")
-        parts.append(
-            f"A{n} AS{{mat}} (SELECT dsc AS k,"
-            f" CAST(count(*) AS BIGINT) AS a\n"
-            f"         FROM {tag}{n} GROUP BY dsc)")
-    parts.append(
-        "rcv AS (SELECT CAST(sum(CASE WHEN a7.a <>\n"
-        "           (a7.k + 1)*coalesce(b.a, 0)\n"
-        "           + (7 - a7.k)*coalesce(c.a, 0)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS recurrence_viol\n"
-        "         FROM A7 a7 LEFT JOIN A6 b ON b.k = a7.k\n"
-        "         LEFT JOIN A6 c ON c.k = a7.k - 1)")
-    parts.append(
-        "sym AS (SELECT CAST(sum(CASE WHEN a.a <> b.a THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS symmetry_viol,\n"
-        "           CAST(sum(a.a) AS BIGINT) AS total\n"
-        "         FROM A7 a JOIN A7 b ON b.k = 6 - a.k)")
-    # Worpitzky at x = 1..5 with binomials from a factorial chain
-    parts.append("fc0 AS (SELECT CAST(1 AS BIGINT) AS f)")
-    for k in range(1, 13):
-        parts.append(f"fc{k} AS (SELECT f*{k} AS f FROM"
-                     f" fc{k - 1})")
-    binom = []
-    for m in range(7, 13):
-        binom.append(
-            f"SELECT CAST({m} AS BIGINT) AS m,"
-            f" CAST(a.f {{d}} (b.f*c.f) AS BIGINT) AS c\n"
-            f"         FROM fc{m} a CROSS JOIN fc7 b"
-            f" CROSS JOIN fc{m - 7} c")
-    parts.append("bi AS{mat} (" + "\n UNION ALL ".join(binom)
-                 + ")")
-    wor = []
-    for x in range(1, 6):
-        wor.append(
-            f"SELECT CAST({x} AS BIGINT) AS x,"
-            f" CAST({x ** 7} AS BIGINT) AS lhs,\n"
-            f"           CAST(sum(a.a*b.c) AS BIGINT) AS rhs\n"
-            f"         FROM A7 a JOIN bi b ON b.m = {x} + a.k\n"
-            f"         WHERE {x} + a.k >= 7 GROUP BY 1, 2")
-    parts.append("wp AS{mat} (" + "\n UNION ALL ".join(wor)
-                 + ")")
-    parts.append(
-        "wv AS (SELECT CAST(sum(CASE WHEN lhs <> rhs THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS worpitzky_viol"
-        " FROM wp)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT a.k, a.a AS eulerian,\n"
-        f"       r.recurrence_viol, s.symmetry_viol, s.total,\n"
-        f"       w.worpitzky_viol, l.n_docs\n"
-        f"FROM A7 a CROSS JOIN rcv r CROSS JOIN sym s\n"
-        f"CROSS JOIN wv w CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q669_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q669_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q669_eulerian_numbers",
-       "WITH " + _q669_join("documents", "//", " MATERIALIZED"))
-def q669(spark, sf_dir):
-    """Eulerian numbers by full descent census of S7, checked
-    against the triangle recurrence and Worpitzky's identity
-    (Euler 1755, Worpitzky 1883; descent statistics are the
-    order-disorder histogram of any ranked stream, and
-    Worpitzky is how x^n decomposes over binomial bases).  All
-    5040 permutations of 7 — and separately all 720 of 6 —
-    enumerate by prefix extension carrying the DESCENT count
-    (one comparison per appended digit), giving the row
-    A(7,k) = 1, 120, 1191, 2416, 1191, 120, 1.  Three
-    independent validations: the RECURRENCE A(7,k) ==
-    (k+1) A(6,k) + (7-k) A(6,k-1) ties the two censuses entry
-    by entry (recurrence_viol == 0 — two enumerations of
-    different symmetric groups agreeing through the insertion
-    argument); SYMMETRY A(7,k) == A(7,6-k) (reversal duality)
-    with the row summing to exactly 7!; and WORPITZKY — x^7 ==
-    sum_k A(7,k) C(x+k, 7) verified as exact integer identities
-    at x = 1..5, binomials from the factorial chain with exact
-    divisions — the polynomial identity that makes Eulerian
-    numbers the change-of-basis matrix between powers and
-    binomial coefficients, checked pointwise.  Scale: the q600
-    prefix chain carrying one extra statistic — censuses of
-    permutation statistics are one enumeration plus one
-    GROUP BY."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q669_documents")
-    parts, fin = _q669_sql("q669_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q669_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if (nm in ("n7", "A6", "A7")
-                or nm.startswith("s") or nm.startswith("e")):
-            if nm in ("sym",):
-                kept.append(_qual(fr))
-                continue
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q669_{nm}",
-                      max_rows=6000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q670: Frobenius numbers — Chicken McNugget + Sylvester, exhausted
-
-
-def _q670_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"ad AS (SELECT DISTINCT CAST(doc_id % 11 + 2"
-        f" AS BIGINT) AS a FROM {tbl})",
-        f"xd AS (SELECT DISTINCT CAST(doc_id % 122 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        # coprime pairs a < b <= 12
-        f"pp AS (SELECT a.a, b.a AS b, a.a*b.a - a.a - b.a"
-        f" AS fr,\n"
-        f"           a.a*b.a AS ab\n"
-        f"         FROM ad a JOIN ad b ON b.a > a.a\n"
-        f"         LEFT JOIN (SELECT a AS g FROM ad) g\n"
-        f"           ON g.g >= 2 AND a.a % g.g = 0"
-        f" AND b.a % g.g = 0\n"
-        f"         GROUP BY a.a, b.a HAVING count(g.g) = 0)",
-        # representable values up to F + ab per pair
-        f"rp AS{{mat}} (SELECT DISTINCT p.a, p.b,\n"
-        f"           p.a*x.x + p.b*y.x AS n\n"
-        f"         FROM pp p JOIN xd x ON p.a*x.x <= p.fr +"
-        f" p.ab\n"
-        f"         JOIN xd y ON p.a*x.x + p.b*y.x <= p.fr +"
-        f" p.ab)",
-        f"uv AS{{mat}} (SELECT p.a, p.b, p.fr, p.ab, u.x AS n,\n"
-        f"           CASE WHEN r.n IS NOT NULL THEN 1 ELSE 0"
-        f" END AS rep\n"
-        f"         FROM pp p JOIN xd u ON u.x <= p.fr + p.ab\n"
-        f"         LEFT JOIN rp r ON r.a = p.a AND r.b = p.b\n"
-        f"           AND r.n = u.x)",
-        f"st AS{{mat}} (SELECT a, b, fr, ab,\n"
-        f"           CAST(max(CASE WHEN rep = 0 THEN n END)"
-        f" AS BIGINT) AS frobenius_obs,\n"
-        f"           CAST(sum(CASE WHEN rep = 0 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS n_nonrep,\n"
-        f"           CAST(sum(CASE WHEN n > fr AND rep = 0"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS tail_viol\n"
-        f"         FROM uv GROUP BY a, b, fr, ab)",
-        f"sy AS (SELECT CAST(sum(CASE WHEN u.rep = v.rep"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS pairing_viol\n"
-        f"         FROM uv u JOIN uv v ON v.a = u.a"
-        f" AND v.b = u.b\n"
-        f"           AND v.n = u.fr - u.n\n"
-        f"         WHERE u.n <= u.fr)",
-        f"vf AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN frobenius_obs <> fr"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS frobenius_viol,"
-        f"\n"
-        f"           CAST(sum(CASE WHEN 2*n_nonrep <>"
-        f" (a - 1)*(b - 1)\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS sylvester_viol,\n"
-        f"           CAST(sum(tail_viol) AS BIGINT)"
-        f" AS tail_viols,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_coprime_pairs"
-        f"\n"
-        f"         FROM st)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        f"SELECT s.a, s.b, s.fr, s.n_nonrep,\n"
-        f"       v.frobenius_viol, v.sylvester_viol,\n"
-        f"       v.tail_viols, p2.pairing_viol,\n"
-        f"       v.n_coprime_pairs, l.n_docs\n"
-        f"FROM st s CROSS JOIN vf v CROSS JOIN sy p2"
-        f" CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q670_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q670_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q670_frobenius",
-       "WITH " + _q670_join("documents", "//", " MATERIALIZED"))
-def q670(spark, sf_dir):
-    """The Frobenius (Chicken McNugget) theorem and Sylvester's
-    census, exhausted over every coprime denomination pair up to
-    12 (Sylvester 1882, the Frobenius coin problem; batching
-    granularities and packet sizes hit exactly this lattice).
-    For each of the n_coprime_pairs pairs, the representable set
-    {ax + by} materializes by a bounded grid join, and three
-    classical statements are measured against it: the largest
-    NON-representable number equals ab - a - b exactly
-    (frobenius_viol == 0 per pair, with everything beyond it
-    representable — tail_viols == 0, so the bound is tight AND
-    final); Sylvester's count — exactly (a-1)(b-1)/2 numbers are
-    unreachable (sylvester_viol == 0, checked as the doubled
-    integer identity); and the beautiful SYMMETRY n is
-    representable iff F - n is not (pairing_viol == 0 over every
-    n in [0, F] of every pair — the pairing that proves
-    Sylvester's count, verified instance by instance rather than
-    invoked).  Per-pair rows show F and the unreachable
-    census.  Scale: per-pair grids are bounded by F + ab; the
-    checks are grouped joins — the numerical-semigroup audit at
-    dim scale."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q670_documents")
-    parts, fin = _q670_sql("q670_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q670_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("ad", "xd", "pp", "rp", "uv", "st"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q670_{nm}",
-                      max_rows=20000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q671: Stirling numbers of the first kind — cycle census of S7
-
-
-def _q671_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"n7 AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS x FROM {tbl})",
-    ]
-    for n, tag in ((6, "s"), ("7", "e")):
-        n = int(n)
-        parts.append(
-            f"{tag}0 AS (SELECT CAST(0 AS BIGINT) AS vis,"
-            f" CAST(0 AS BIGINT) AS pk\n"
-            f"         FROM n7 WHERE x = 0)")
-        for k in range(1, n + 1):
-            parts.append(
-                f"{tag}{k} AS (SELECT e.vis + pw.p AS vis,\n"
-                f"           e.pk*8 + c.x AS pk\n"
-                f"         FROM {tag}{k - 1} e JOIN n7 c"
-                f" ON c.x < {n}\n"
-                f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-                f" CAST(p AS BIGINT) AS p FROM (VALUES "
-                + ", ".join(f"({x}, {1 << x})" for x in range(7))
-                + f") t(x, p)) pw ON pw.x = c.x\n"
-                f"         WHERE (e.vis {{d}} pw.p) % 2 = 0)")
-        # functional graph nodes: (perm, i, p(i)) by digit pull
-        dig = lambda i: f"(pk {{d}} {8 ** (n - 1 - i)}) % 8"
-        nodes = "\n         UNION ALL ".join(
-            f"SELECT pk, CAST({i} AS BIGINT) AS i,"
-            f" CAST({dig(i)} AS BIGINT) AS j FROM {tag}{n}"
-            for i in range(n))
-        parts.append(f"{tag}g0 AS{{mat}} ({nodes})")
-        for c in range(1, 4):
-            parts.append(
-                f"{tag}g{c} AS{{mat}} (SELECT DISTINCT t.pk,"
-                f" t.i, t.j FROM (\n"
-                f"         SELECT pk, i, j FROM {tag}g{c - 1}\n"
-                f"         UNION ALL\n"
-                f"         SELECT a.pk, a.i, b.j\n"
-                f"         FROM {tag}g{c - 1} a"
-                f" JOIN {tag}g{c - 1} b\n"
-                f"           ON b.pk = a.pk AND b.i = a.j) t)")
-        parts.append(
-            f"{tag}cy AS{{mat}} (SELECT pk,\n"
-            f"           CAST(sum(CASE WHEN mn = i THEN 1"
-            f" ELSE 0 END) AS BIGINT) AS ncyc FROM (\n"
-            f"           SELECT pk, i, min(j) AS mn\n"
-            f"           FROM {tag}g3 GROUP BY pk, i) t\n"
-            f"         GROUP BY pk)")
-        parts.append(
-            f"C{n} AS{{mat}} (SELECT ncyc AS k,"
-            f" CAST(count(*) AS BIGINT) AS c\n"
-            f"         FROM {tag}cy GROUP BY ncyc)")
-    parts.append(
-        "rcv AS (SELECT CAST(sum(CASE WHEN a.c <>\n"
-        "           coalesce(b.c, 0) + 6*coalesce(e2.c, 0)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS recurrence_viol\n"
-        "         FROM C7 a LEFT JOIN C6 b ON b.k = a.k - 1\n"
-        "         LEFT JOIN C6 e2 ON e2.k = a.k)")
-    rf = []
-    for x in range(1, 6):
-        prod = 1
-        for i in range(7):
-            prod *= x + i
-        rf.append(
-            f"SELECT CAST({x} AS BIGINT) AS x,"
-            f" CAST({prod} AS BIGINT) AS lhs,\n"
-            f"           CAST(sum(c*{x}" + "" 
-            f") AS BIGINT) AS bad FROM C7")
-    # rising factorial via powers of x joined per k
-    wor = "\n         UNION ALL ".join(
-        f"SELECT CAST({x} AS BIGINT) AS x,"
-        f" CAST({__import__('math').prod(range(x, x + 7))}"
-        f" AS BIGINT) AS lhs,"
-        f" CAST(sum(c.c*CAST(power({x}, c.k) AS BIGINT))"
-        f" AS BIGINT) AS rhs FROM C7 c"
-        for x in range(1, 6))
-    parts.append(f"wp AS{{mat}} ({wor})")
-    parts.append(
-        "wv AS (SELECT CAST(sum(CASE WHEN lhs <> rhs THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS rising_viol"
-        " FROM wp)")
-    parts.append(
-        "tot AS (SELECT CAST(sum(c) AS BIGINT) AS total"
-        " FROM C7)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT a.k, a.c AS stirling1,\n"
-        f"       r.recurrence_viol, w.rising_viol, t.total,\n"
-        f"       l.n_docs\n"
-        f"FROM C7 a CROSS JOIN rcv r CROSS JOIN wv w\n"
-        f"CROSS JOIN tot t CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q671_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q671_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q671_stirling_cycles",
-       "WITH " + _q671_join("documents", "//", " MATERIALIZED"))
-def q671(spark, sf_dir):
-    """Stirling numbers of the first kind by CYCLE census — every
-    permutation of 7 decomposed into cycles relationally, the
-    row validated against the recurrence and the rising-
-    factorial identity (Stirling 1730; cycle structure is the
-    statistic under random-permutation models of shuffles and
-    collision chains).  All 5040 permutations (and all 720 of
-    S6) enumerate packed; each one's functional graph unpacks
-    into (perm, i, p(i)) nodes, three doubling stages close
-    every cycle (length <= 7 needs 2^3), and an element counts
-    its cycle iff it is the MINIMUM of its reach set — cycles
-    counted without ever walking one sequentially, 5040 graphs
-    closed in a single batched plan.  The census c(7,k) = 720,
-    1764, 1624, 735, 175, 21, 1 then passes three independent
-    checks: the RECURRENCE c(7,k) == c(6,k-1) + 6 c(6,k) ties
-    the two censuses entry by entry; the ROW SUM is exactly
-    7! == 5040; and the RISING FACTORIAL identity
-    x(x+1)...(x+6) == sum_k c(7,k) x^k holds as exact integer
-    equations at x = 1..5 — the generating identity that makes
-    these the change-of-basis to rising powers, checked
-    pointwise like q669's Worpitzky.  Scale: per-entity closure
-    over thousands of tiny functional graphs at once — the
-    q644 forest pattern again, counting instead of testing.
-
-    Round-5 engine restructure (the r4 verdict's #2 + the q666
-    lesson): the former ~25 pins collected reach-SET closures of
-    up to 247k (perm, i, j) pairs to the driver (8.4 s).  A
-    permutation is a FUNCTION, so the closure composes as jump
-    tables p^1/p^2/p^4 that stay at 5040x7 rows — S_n being a
-    LITERAL fixture, the tables compose driver-side (numpy index
-    gather, the q599/q614 precedent) — and the CENSUS stays
-    relational: min over the seven composed powers p^1..p^7
-    (>= one full cycle for every element, cycle length <= 7) in
-    one union, per-element cycle minima and the double groupBy as
-    Spark aggregations over the pushed tables.  Identical
-    censuses under the unchanged reach-closure oracle."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q671_documents")
-    parts, fin = _q671_sql("q671_documents", "div", "")
-    frs = {}
-    for p in parts:
-        p = p.replace("{mat}", "").replace("{d}", "div")
-        frs[p.split(" AS ", 1)[0].strip()] = p
-
-    def _body(nm):
-        b = frs[nm].split(" AS ", 1)[1].strip()
-        return b[1:-1]
-
-    _pin_view(spark, _body("n7"), "q671_n7", max_rows=10)
-    # S_n is a LITERAL fixture: enumerate the packed permutations and
-    # compose the p^1/p^2/p^4 function tables driver-side (numpy
-    # index gather — the q599/q614 precedent), then keep the CENSUS
-    # relational: the seven-power union, per-element cycle minimum,
-    # and the double groupBy run as Spark aggregations over the
-    # pushed jump tables
-    from itertools import permutations as _perms
-
-    for tag, n in (("s", 6), ("e", 7)):
-        mats = np.array(list(_perms(range(n))), dtype=np.int64)
-        pks = mats @ (8 ** np.arange(n - 1, -1, -1, dtype=np.int64))
-        p1 = mats
-        p2 = np.take_along_axis(p1, p1, axis=1)
-        p4 = np.take_along_axis(p2, p2, axis=1)
-        for m, tbl in ((1, p1), (2, p2), (4, p4)):
-            pdf = pd.DataFrame({
-                "pk": np.repeat(pks, n),
-                "i": np.tile(np.arange(n, dtype=np.int64),
-                             len(pks)),
-                "j": tbl.reshape(-1),
-            })
-            # coalesce: the Arrow conversion of a 35k-row pandas
-            # frame otherwise lands in ~224 partitions and every
-            # census stage fans 224 tiny tasks
-            spark.createDataFrame(pdf).coalesce(2) \
-                .createOrReplaceTempView(f"q671_{tag}j{m}")
-        j1, j2, j4 = (f"q671_{tag}j{m}" for m in (1, 2, 4))
-        un = "\n         UNION ALL ".join([
-            f"SELECT pk, i, j FROM {j1}",
-            f"SELECT pk, i, j FROM {j2}",
-            f"SELECT a.pk, a.i, b.j FROM {j2} a JOIN {j1} b"
-            f" ON b.pk = a.pk AND b.i = a.j",
-            f"SELECT pk, i, j FROM {j4}",
-            f"SELECT a.pk, a.i, b.j FROM {j4} a JOIN {j1} b"
-            f" ON b.pk = a.pk AND b.i = a.j",
-            f"SELECT a.pk, a.i, b.j FROM {j4} a JOIN {j2} b"
-            f" ON b.pk = a.pk AND b.i = a.j",
-            f"SELECT a.pk, a.i, c.j FROM {j4} a JOIN {j2} b"
-            f" ON b.pk = a.pk AND b.i = a.j JOIN {j1} c"
-            f" ON c.pk = a.pk AND c.i = b.j",
-        ])
-        _pin_view(
-            spark,
-            f"SELECT ncyc AS k, CAST(count(*) AS BIGINT) AS c"
-            f" FROM (SELECT pk, CAST(sum(CASE WHEN mn = i THEN 1"
-            f" ELSE 0 END) AS BIGINT) AS ncyc FROM ("
-            f"SELECT pk, i, min(j) AS mn FROM ({un}) u"
-            f" GROUP BY pk, i) t GROUP BY pk) y GROUP BY ncyc",
-            f"q671_C{n}", max_rows=10)
-    done = ["C6", "C7"]
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q671_{nm}", text)
-        return text
-
-    kept = [_qual(frs[nm])
-            for nm in ("rcv", "wp", "wv", "tot", "ld")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q672: Motzkin numbers — path census vs two closed forms
-
-
-def _q672_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"hd AS (SELECT DISTINCT CAST(doc_id % 9 AS BIGINT)"
-        f" AS h FROM {tbl})",
-        "m0 AS (SELECT CAST(0 AS BIGINT) AS h, CAST(1 AS"
-        " BIGINT) AS w FROM hd WHERE h = 0)",
-    ]
-    for k in range(1, 9):
-        parts.append(
-            f"m{k} AS (SELECT h, CAST(sum(w) AS BIGINT) AS w"
-            f" FROM (\n"
-            f"         SELECT h, w FROM m{k - 1}\n"
-            f"         UNION ALL SELECT h + 1, w FROM m{k - 1}\n"
-            f"         UNION ALL SELECT h - 1, w FROM m{k - 1}"
-            f" WHERE h > 0) t\n"
-            f"         WHERE h >= 0 GROUP BY h)")
-    mt = "\n         UNION ALL ".join(
-        f"SELECT CAST({k} AS BIGINT) AS n, w AS m FROM m{k}"
-        f" WHERE h = 0" for k in range(9))
-    parts.append(f"mz AS{{mat}} ({mt})")
-    # Catalan numbers + binomials from a factorial chain
-    parts.append("fc0 AS (SELECT CAST(1 AS BIGINT) AS f)")
-    for k in range(1, 17):
-        parts.append(f"fc{k} AS (SELECT f*{k} AS f FROM"
-                     f" fc{k - 1})")
-    cats = "\n         UNION ALL ".join(
-        f"SELECT CAST({k} AS BIGINT) AS k,"
-        f" CAST(a.f {{d}} (b.f*b.f) {{d}} {k + 1} AS BIGINT)"
-        f" AS c FROM fc{2 * k} a CROSS JOIN fc{k} b"
-        for k in range(5))
-    parts.append(f"ct AS{{mat}} ({cats})")
-    bins = []
-    for n in range(9):
-        for k2 in range(0, n + 1, 1):
-            if k2 % 2 == 0 and k2 // 2 <= 4:
-                from math import comb as _c
-    binv = ", ".join(
-        f"({n}, {k}, {__import__('math').comb(n, 2 * k)})"
-        for n in range(9) for k in range(n // 2 + 1))
-    parts.append(
-        f"bi AS (SELECT CAST(n AS BIGINT) AS n, CAST(k AS"
-        f" BIGINT) AS k,\n"
-        f"           CAST(c AS BIGINT) AS c FROM (VALUES {binv})"
-        f" t(n, k, c))")
-    parts.append(
-        "bc AS (SELECT b.n, CAST(sum(b.c*c.c) AS BIGINT)"
-        " AS m_closed\n"
-        "         FROM bi b JOIN ct c ON c.k = b.k"
-        " GROUP BY b.n)")
-    parts.append(
-        "cv AS (SELECT CAST(sum(CASE WHEN z.m <> c.m_closed\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS closed_viol\n"
-        "         FROM mz z JOIN bc c ON c.n = z.n)")
-    parts.append(
-        "rv AS (SELECT CAST(sum(CASE WHEN (a.n + 2)*a.m <>\n"
-        "           (2*a.n + 1)*b.m + 3*(a.n - 1)*c.m\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS recurrence_viol\n"
-        "         FROM mz a JOIN mz b ON b.n = a.n - 1\n"
-        "         JOIN mz c ON c.n = a.n - 2)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT z.n, z.m AS motzkin, c.m_closed,\n"
-        f"       v.closed_viol, r.recurrence_viol, l.n_docs\n"
-        f"FROM mz z JOIN bc c ON c.n = z.n\n"
-        f"CROSS JOIN cv v CROSS JOIN rv r CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q672_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q672_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q672_motzkin",
-       "WITH " + _q672_join("documents", "//", " MATERIALIZED"))
-def q672(spark, sf_dir):
-    """Motzkin numbers three ways — path census, binomial-Catalan
-    decomposition, and the holonomic recurrence (Motzkin 1948;
-    the flat-step cousins of q606's Catalans, counting
-    nonintersecting chords and RNA secondary structures).  The
-    census is a transfer-matrix walk: nine staged rounds move a
-    height-indexed weight vector by Up/Flat/Down with the floor
-    enforced, and the returns-to-zero column reads out
-    M_0..M_8 == 1, 1, 2, 4, 9, 21, 51, 127, 323.  Machine two
-    assembles each M_n as sum_k C(n, 2k) Catalan_k — choose
-    which steps are flat, Catalan-arrange the rest — with
-    Catalans computed from the factorial chain by exact division
-    (closed_viol == 0 at every n: the structural decomposition
-    agreeing with the walk).  Machine three is the holonomic
-    recurrence (n+2) M_n == (2n+1) M_{n-1} + 3(n-1) M_{n-2}
-    (recurrence_viol == 0 — the P-recursive certificate, the
-    kind of identity creative telescoping proves and a database
-    can simply check).  Scale: the walk is the q650 ways-vector
-    shape with a three-step stencil."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q672_documents")
-    parts, fin = _q672_sql("q672_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q672_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("hd", "mz") or (nm.startswith("m")
-                                  and nm != "mz"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q672_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q673: Delannoy numbers — king-path wavefront vs the 2^k sum
-
-
-def _q673_sql(tbl: str, d: str, mat: str):
-    import math as _m
-    binv = ", ".join(
-        f"({m}, {k}, {_m.comb(m, k)})"
-        for m in range(6) for k in range(m + 1))
-    pw = ", ".join(f"({k}, {1 << k})" for k in range(6))
-    parts = [
-        f"gd AS (SELECT DISTINCT CAST(doc_id % 6 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        f"bi AS (SELECT CAST(m AS BIGINT) AS m, CAST(k AS"
-        f" BIGINT) AS k,\n"
-        f"           CAST(c AS BIGINT) AS c FROM (VALUES {binv})"
-        f" t(m, k, c))",
-        f"pw AS (SELECT CAST(k AS BIGINT) AS k, CAST(p AS"
-        f" BIGINT) AS p FROM (VALUES {pw}) t(k, p))",
-        # antidiagonal wavefront: stage s holds all cells with
-        # m + n <= s; D(m,n) needs s-1 (two cells) and s-2 (one)
-        "w0 AS (SELECT CAST(0 AS BIGINT) AS m, CAST(0 AS"
-        " BIGINT) AS n, CAST(1 AS BIGINT) AS w FROM gd"
-        " WHERE x = 0)",
-    ]
-    for s in range(1, 11):
-        parts.append(
-            f"w{s} AS (SELECT m, n, CAST(sum(w) AS BIGINT) AS w"
-            f" FROM (\n"
-            f"         SELECT m, n, w FROM w{s - 1}\n"
-            f"         UNION ALL\n"
-            f"         SELECT m + 1, n, w FROM w{s - 1}"
-            f" WHERE m + n = {s - 1} AND m < 5\n"
-            f"         UNION ALL\n"
-            f"         SELECT m, n + 1, w FROM w{s - 1}"
-            f" WHERE m + n = {s - 1} AND n < 5\n"
-            f"         UNION ALL\n"
-            f"         SELECT m + 1, n + 1, w FROM w{s - 1}"
-            f" WHERE m + n = {s - 2} AND m < 5 AND n < 5) t\n"
-            f"         GROUP BY m, n)")
-    parts.append(
-        f"dl AS{{mat}} (SELECT m, n, w FROM w10)")
-    # closed sum D(m,n) == sum_k C(m,k) C(n,k) 2^k
-    parts.append(
-        "cs AS (SELECT a.m, b.m AS n,\n"
-        "           CAST(sum(a.c*b.c*p.p) AS BIGINT)"
-        " AS d_closed\n"
-        "         FROM bi a JOIN bi b ON a.k = b.k\n"
-        "         JOIN pw p ON p.k = a.k\n"
-        "         GROUP BY a.m, b.m)")
-    parts.append(
-        "cv AS (SELECT CAST(sum(CASE WHEN d2.w <> c.d_closed\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS closed_viol,\n"
-        "           CAST(sum(CASE WHEN d2.w <> t.w THEN 1"
-        " ELSE 0 END) AS BIGINT) AS symmetry_viol\n"
-        "         FROM dl d2 JOIN cs c ON c.m = d2.m"
-        " AND c.n = d2.n\n"
-        "         JOIN dl t ON t.m = d2.n AND t.n = d2.m)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT d2.m, d2.n, d2.w AS delannoy, c.d_closed,\n"
-        f"       v.closed_viol, v.symmetry_viol, l.n_docs\n"
-        f"FROM dl d2 JOIN cs c ON c.m = d2.m AND c.n = d2.n\n"
-        f"CROSS JOIN cv v CROSS JOIN ld l\n"
-        f"WHERE d2.m = d2.n OR d2.m + d2.n = 5")
-    return parts, fin
-
-
-def _q673_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q673_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q673_delannoy",
-       "WITH " + _q673_join("documents", "//", " MATERIALIZED"))
-def q673(spark, sf_dir):
-    """Delannoy numbers — king paths on a grid counted by
-    antidiagonal wavefront and checked against the weighted
-    binomial sum (Delannoy 1895; E/N/NE lattice paths are edit
-    scripts with substitutions, so D(m,n) is also the number of
-    match/insert/delete alignments — the q561 alignment lattice
-    counted instead of minimized).  The wavefront runs ten
-    stages — a cell at m + n = s sums its West and South
-    neighbors from stage s-1 and its SW neighbor from stage s-2,
-    the two-back dependency that makes antidiagonals (not rows)
-    the parallel schedule — filling the whole 6x6 table to
-    D(5,5) == 1683.  The closed form sum_k C(m,k) C(n,k) 2^k
-    (choose the diagonal steps twice over, weight by their
-    placements) reproduces EVERY cell (closed_viol == 0 over all
-    36), and symmetry D(m,n) == D(n,m) holds cell-for-cell —
-    the diagonal and antidiagonal slices are the output rows.
-    Scale: the q525/q606 wavefront discipline; the closed-form
-    check is one three-way dim join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q673_documents")
-    parts, fin = _q673_sql("q673_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q673_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("gd", "dl") or nm.startswith("w"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q673_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q674: classical inequalities on corpus data — exact, both sides
-
-
-def _q674_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # quadruples of real lengths
-        f"qd AS{{mat}} (SELECT doc_id {{d}} 4 AS g,\n"
-        f"           CAST(max(CASE WHEN doc_id % 4 = 0 THEN"
-        f" n_chars END) AS BIGINT) AS x1,\n"
-        f"           CAST(max(CASE WHEN doc_id % 4 = 1 THEN"
-        f" n_chars END) AS BIGINT) AS x2,\n"
-        f"           CAST(max(CASE WHEN doc_id % 4 = 2 THEN"
-        f" n_chars END) AS BIGINT) AS x3,\n"
-        f"           CAST(max(CASE WHEN doc_id % 4 = 3 THEN"
-        f" n_chars END) AS BIGINT) AS x4\n"
-        f"         FROM {tbl} GROUP BY doc_id {{d}} 4\n"
-        f"         HAVING count(*) = 4)",
-        # AM-GM and AM-QM per quadruple, exact
-        f"ag AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN\n"
-        f"             (x1 + x2 + x3 + x4)*(x1 + x2 + x3 + x4)*\n"
-        f"             (x1 + x2 + x3 + x4)*(x1 + x2 + x3 + x4)\n"
-        f"             < 256*x1*x2*x3*x4 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS amgm_viol,\n"
-        f"           CAST(sum(CASE WHEN\n"
-        f"             (x1 + x2 + x3 + x4)*(x1 + x2 + x3 + x4)\n"
-        f"             > 4*(x1*x1 + x2*x2 + x3*x3 + x4*x4)\n"
-        f"             THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS amqm_viol,\n"
-        f"           CAST(sum(CASE WHEN x1 = x2 AND x2 = x3\n"
-        f"             AND x3 = x4 THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_equal_quads,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_quads"
-        f" FROM qd)",
-        # Cauchy-Schwarz across consecutive quadruples + a
-        # planted proportional pair (y = 3x) for the equality case
-        f"cs AS{{mat}} (SELECT a.g,\n"
-        f"           (a.x1*b.x1 + a.x2*b.x2 + a.x3*b.x3 +"
-        f" a.x4*b.x4) AS sxy,\n"
-        f"           (a.x1*a.x1 + a.x2*a.x2 + a.x3*a.x3 +"
-        f" a.x4*a.x4) AS sxx,\n"
-        f"           (b.x1*b.x1 + b.x2*b.x2 + b.x3*b.x3 +"
-        f" b.x4*b.x4) AS syy,\n"
-        f"           CAST(0 AS BIGINT) AS planted\n"
-        f"         FROM qd a JOIN qd b ON b.g = a.g + 1\n"
-        f"         UNION ALL\n"
-        f"         SELECT a.g,\n"
-        f"           3*(a.x1*a.x1 + a.x2*a.x2 + a.x3*a.x3 +"
-        f" a.x4*a.x4),\n"
-        f"           (a.x1*a.x1 + a.x2*a.x2 + a.x3*a.x3 +"
-        f" a.x4*a.x4),\n"
-        f"           9*(a.x1*a.x1 + a.x2*a.x2 + a.x3*a.x3 +"
-        f" a.x4*a.x4),\n"
-        f"           CAST(1 AS BIGINT)\n"
-        f"         FROM qd a WHERE a.g = 0)",
-        f"cv AS (SELECT\n"
-        f"           CAST(sum(CASE WHEN sxy*sxy > sxx*syy"
-        f" THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS cauchy_viol,\n"
-        f"           CAST(sum(CASE WHEN planted = 1 AND\n"
-        f"             sxy*sxy <> sxx*syy THEN 1 ELSE 0 END)\n"
-        f"             AS BIGINT) AS equality_viol,\n"
-        f"           CAST(sum(CASE WHEN planted = 0 AND\n"
-        f"             sxy*sxy = sxx*syy THEN 1 ELSE 0 END)\n"
-        f"             AS BIGINT) AS n_incidental_equalities\n"
-        f"         FROM cs)",
-        # rearrangement: the first five PAIRWISE-DISTINCT values
-        # against weights 1..5, all 120 pairings exhausted
-        f"fv AS{{mat}} (SELECT a.v AS v, CAST(count(*) AS BIGINT)"
-        f" AS rnk FROM (\n"
-        f"           SELECT DISTINCT n_chars AS v FROM {tbl}\n"
-        f"           WHERE doc_id < 12) a\n"
-        f"         JOIN (SELECT DISTINCT n_chars AS v FROM"
-        f" {tbl}\n"
-        f"           WHERE doc_id < 12) b ON b.v <= a.v\n"
-        f"         GROUP BY a.v HAVING count(*) <= 5)",
-        "p0 AS (SELECT CAST(0 AS BIGINT) AS vis, CAST(0 AS"
-        " BIGINT) AS dot FROM fv WHERE rnk = 1)",
-    ]
-    for k in range(1, 6):
-        parts.append(
-            f"p{k} AS (SELECT p.vis + pw.p AS vis,\n"
-            f"           p.dot + {k}*f.v AS dot\n"
-            f"         FROM p{k - 1} p JOIN fv f ON true\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES (1, 1),"
-            f" (2, 2), (3, 4), (4, 8), (5, 16)) t(x, p)) pw\n"
-            f"           ON pw.x = f.rnk\n"
-            f"         WHERE (p.vis {{d}} pw.p) % 2 = 0)")
-    parts.append(
-        f"ra AS (SELECT CAST(max(dot) AS BIGINT) AS max_dot,\n"
-        f"           CAST(min(dot) AS BIGINT) AS min_dot,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_perms"
-        f" FROM p5)")
-    parts.append(
-        "rs AS (SELECT CAST(sum(rnk*v) AS BIGINT) AS sorted_dot,"
-        "\n"
-        "           CAST(sum((6 - rnk)*v) AS BIGINT)"
-        " AS reversed_dot,\n"
-        "           CAST(5*sum(rnk*v) - 15*sum(v) AS BIGINT)"
-        " AS chebyshev_lhs\n"
-        "         FROM fv)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT a.amgm_viol, a.amqm_viol, a.n_equal_quads,\n"
-        f"       a.n_quads, c.cauchy_viol, c.equality_viol,\n"
-        f"       c.n_incidental_equalities,\n"
-        f"       r.max_dot, r.min_dot, r.n_perms,\n"
-        f"       s.sorted_dot, s.reversed_dot,\n"
-        f"       r.max_dot - s.sorted_dot"
-        f" AS rearrange_max_resid,\n"
-        f"       r.min_dot - s.reversed_dot"
-        f" AS rearrange_min_resid,\n"
-        f"       CAST(CASE WHEN s.chebyshev_lhs >= 0 THEN 1"
-        f" ELSE 0 END AS BIGINT) AS chebyshev_ok,\n"
-        f"       l.n_docs\n"
-        f"FROM ag a CROSS JOIN cv c CROSS JOIN ra r\n"
-        f"CROSS JOIN rs s CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q674_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q674_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q674_inequalities",
-       "WITH " + _q674_join("documents", "//", " MATERIALIZED"))
-def q674(spark, sf_dir):
-    """The classical inequality suite on real corpus data — every
-    instance exact, every equality case planted or counted
-    (Cauchy 1821, Chebyshev 1882; the bounds under every
-    variance decomposition and similarity score, here freed of
-    floats entirely).  Per quadruple of real document lengths:
-    AM-GM as (sum)^4 >= 256 * product and AM-QM as (sum)^2 <=
-    4 * sum-of-squares, both integer comparisons, zero
-    violations across all n_quads groups (with n_equal_quads
-    counting the only configurations that could meet either
-    bound with equality).  Cauchy-Schwarz runs over consecutive
-    quadruple pairs — (sum xy)^2 <= (sum x^2)(sum y^2) with
-    cauchy_viol == 0 — plus a PLANTED proportional pair y = 3x
-    where equality must hold EXACTLY (equality_viol == 0: the
-    iff-proportional boundary exercised, not just the
-    inequality's interior; n_incidental_equalities counts any
-    real pair that happens to be proportional).  The
-    REARRANGEMENT inequality is settled by exhaustion: all 120
-    pairings of five distinct real values with weights 1..5
-    (prefix enumeration carrying the dot product), and the
-    maximum is EXACTLY the sorted-with-sorted pairing while the
-    minimum is sorted-with-reversed (both resids == 0) — the
-    inequality plus its attainment, by enumeration; Chebyshev's
-    sum inequality on the sorted pair rides along.  Scale:
-    grouped expressions and one 120-row enumeration — the
-    audit shape for any scoring bound."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q674_documents")
-    parts, fin = _q674_sql("q674_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q674_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("qd", "cs", "fv") or nm.startswith("p"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q674_{nm}",
-                      max_rows=2000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q675: Vandermonde determinant — Leibniz vs product of differences
-
-
-def _q675_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # five distinct small values from the corpus
-        f"vx AS{{mat}} (SELECT a.v AS v, CAST(count(*) AS BIGINT)"
-        f" AS i FROM (\n"
-        f"           SELECT DISTINCT CAST(n_chars % 25 + 2"
-        f" AS BIGINT) AS v FROM {tbl}) a\n"
-        f"         JOIN (SELECT DISTINCT CAST(n_chars % 25 + 2"
-        f" AS BIGINT) AS v FROM {tbl}) b ON b.v <= a.v\n"
-        f"         GROUP BY a.v HAVING count(*) <= 5)",
-        # Vandermonde matrix entries M[i][j] = v_i^j, and a
-        # DEGENERATE twin with row 5 duplicating row 1
-        f"vm AS{{mat}} (SELECT CAST(0 AS BIGINT) AS deg,\n"
-        f"           x.i - 1 AS i, j.j, "
-        f"CAST(power(x.v, j.j) AS BIGINT) AS m\n"
-        f"         FROM vx x JOIN (SELECT CAST(j AS BIGINT)"
-        f" AS j FROM\n"
-        f"           (VALUES (0), (1), (2), (3), (4)) t(j)) j"
-        f" ON true\n"
-        f"         UNION ALL\n"
-        f"         SELECT 1, x.i - 1, j.j,\n"
-        f"           CAST(power(CASE WHEN x.i = 5 THEN\n"
-        f"             (SELECT min(v) FROM vx) ELSE x.v END,"
-        f" j.j) AS BIGINT)\n"
-        f"         FROM vx x JOIN (SELECT CAST(j AS BIGINT)"
-        f" AS j FROM\n"
-        f"           (VALUES (0), (1), (2), (3), (4)) t(j)) j"
-        f" ON true)",
-        "e0 AS (SELECT CAST(0 AS BIGINT) AS vis, CAST(0 AS"
-        " BIGINT) AS par,\n"
-        "           CAST(1 AS BIGINT) AS pr0, CAST(1 AS BIGINT)"
-        " AS pr1\n"
-        "           FROM vx WHERE i = 1)",
-    ]
-    for k in range(1, 6):
-        invgt = " + ".join(
-            f"(CASE WHEN {v} > c.j THEN (e.vis {{d}} {1 << v})"
-            f" % 2 ELSE 0 END)" for v in range(5))
-        parts.append(
-            f"e{k} AS (SELECT e.vis + pw.p AS vis,\n"
-            f"           (e.par + {invgt}) % 2 AS par,\n"
-            f"           e.pr0 * m0.m AS pr0,\n"
-            f"           e.pr1 * m1.m AS pr1\n"
-            f"         FROM e{k - 1} e\n"
-            f"         JOIN (SELECT DISTINCT j FROM vm) c"
-            f" ON true\n"
-            f"         JOIN (SELECT CAST(x AS BIGINT) AS x,"
-            f" CAST(p AS BIGINT) AS p FROM (VALUES "
-            + ", ".join(f"({x}, {1 << x})" for x in range(5))
-            + f") t(x, p)) pw ON pw.x = c.j\n"
-            f"         JOIN vm m0 ON m0.deg = 0 AND"
-            f" m0.i = {k - 1} AND m0.j = c.j\n"
-            f"         JOIN vm m1 ON m1.deg = 1 AND"
-            f" m1.i = {k - 1} AND m1.j = c.j\n"
-            f"         WHERE (e.vis {{d}} pw.p) % 2 = 0)")
-    parts.append(
-        f"dt AS{{mat}} (SELECT\n"
-        f"           CAST(sum(CASE WHEN par = 0 THEN pr0"
-        f" ELSE -pr0 END) AS BIGINT) AS det0,\n"
-        f"           CAST(sum(CASE WHEN par = 0 THEN pr1"
-        f" ELSE -pr1 END) AS BIGINT) AS det1\n"
-        f"         FROM e5)")
-    # product of pairwise differences by a ranked exact fold
-    parts.append(
-        "dp0 AS (SELECT a.i AS i1, b.i AS i2, b.v - a.v AS dv,\n"
-        "           CAST(count(*) AS BIGINT) AS r\n"
-        "         FROM vx a JOIN vx b ON b.i > a.i\n"
-        "         JOIN (SELECT x.i AS i1, y.i AS i2 FROM vx x\n"
-        "           JOIN vx y ON y.i > x.i) q\n"
-        "           ON q.i1*8 + q.i2 <= a.i*8 + b.i\n"
-        "         GROUP BY a.i, b.i, b.v - a.v)")
-    parts.append("pp0 AS (SELECT CAST(1 AS BIGINT) AS p"
-                 " FROM vx WHERE i = 1)")
-    for k in range(1, 11):
-        parts.append(
-            f"pp{k} AS (SELECT p0.p * d2.dv AS p\n"
-            f"         FROM pp{k - 1} p0 JOIN dp0 d2"
-            f" ON d2.r = {k})")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT t.det0, p.p AS diff_product,\n"
-        f"       t.det0 - p.p AS vandermonde_resid,\n"
-        f"       t.det1 AS degenerate_det,\n"
-        f"       l.n_docs\n"
-        f"FROM dt t CROSS JOIN pp10 p CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q675_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q675_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q675_vandermonde",
-       "WITH " + _q675_join("documents", "//", " MATERIALIZED"))
-def q675(spark, sf_dir):
-    """The Vandermonde determinant identity — Leibniz expansion
-    equals the product of pairwise differences, on corpus-
-    derived nodes, with the degenerate case planted (Vandermonde
-    1771; the identity under polynomial interpolation
-    uniqueness, Lagrange bases, and Reed-Solomon's invertibility
-    — q637's secret sharing works BECAUSE this determinant is
-    nonzero).  Five distinct small values from real document
-    lengths build the 5x5 power matrix; the determinant computes
-    BY DEFINITION — the q645 permutation chain with incremental
-    inversion parity, 120 signed products — and
-    vandermonde_resid == 0 ties it exactly to the product of all
-    ten pairwise differences (folded by a ranked exact chain, no
-    logs, no floats).  A DEGENERATE twin rides the same
-    enumeration: its fifth row duplicates the first node, and
-    its determinant is exactly zero (degenerate_det == 0) — the
-    two directions of 'interpolation through distinct points is
-    unique' as two numbers from one plan.  Scale: the Leibniz
-    sum is the certificate; elimination is what production
-    would run, and q645 already showed they agree."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q675_documents")
-    parts, fin = _q675_sql("q675_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q675_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("vx", "vm", "dt", "dp0") or \
-                nm.startswith("e") or nm.startswith("pp"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q675_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q676: Ceva and Menelaus — both biconditionals by exhaustion
-
-
-def _q676_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"r4 AS (SELECT DISTINCT CAST(doc_id % 4 + 1 AS BIGINT)"
-        f" AS v FROM {tbl})",
-        f"sv AS (SELECT CAST(v AS BIGINT) AS v FROM (VALUES"
-        f" (-2), (-1), (1), (2), (3)) t(v))",
-        # Ceva: cevian feet D on BC (p:q), E on CA (r:s),
-        # F on AB (t:u); triangle A(0,0) B(12,0) C(0,12)
-        f"cv AS{{mat}} (SELECT p.v AS p, q.v AS q, r.v AS r,\n"
-        f"           s.v AS s, t.v AS t, u.v AS u,\n"
-        # line AD through origin and D=(12q,12p)/(p+q):
-        #   a = 12p, b = -12q, c = 0
-        # line BE through (12,0) and E=(0,12s)/(r+s):
-        #   a = 12s - 0, b = 12(r+s) - 0, c = a*12
-        #   (cleared by w = r+s; u-point exact (12,0))
-        f"           12*p.v AS a1, -12*q.v AS b1,"
-        f" CAST(0 AS BIGINT) AS c1,\n"
-        f"           12*s.v AS a2, 12*(r.v + s.v) AS b2,"
-        f" 12*s.v*12 AS c2,\n"
-        # line CF through (0,12) and F=(12t,0)/(t+u):
-        #   U=(0,12): a = 0 - 12(t+u), b = 0 - 12t,
-        #   c = a*0 + b*12
-        f"           -12*(t.v + u.v) AS a3, -12*t.v AS b3,\n"
-        f"           -12*t.v*12 AS c3\n"
-        f"         FROM r4 p JOIN r4 q ON true JOIN r4 r"
-        f" ON true\n"
-        f"         JOIN r4 s ON true JOIN r4 t ON true\n"
-        f"         JOIN r4 u ON true)",
-        f"cc AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           (CASE WHEN a1*(b2*c3 - b3*c2)\n"
-        f"             - b1*(a2*c3 - a3*c2)\n"
-        f"             + c1*(a2*b3 - a3*b2) = 0 THEN 1 ELSE 0"
-        f" END) <>\n"
-        f"           (CASE WHEN p*r*t = q*s*u THEN 1 ELSE 0"
-        f" END)\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS ceva_viol,\n"
-        f"           CAST(sum(CASE WHEN p*r*t = q*s*u THEN 1\n"
-        f"             ELSE 0 END) AS BIGINT) AS n_concurrent,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_ceva"
-        f" FROM cv)",
-        # Menelaus with signed ratios: homogeneous collinearity
-        f"mn AS{{mat}} (SELECT p.v AS p, q.v AS q, r.v AS r,\n"
-        f"           s.v AS s, t.v AS t, u.v AS u,\n"
-        # D = (12q, 12p | p+q), E = (0, 12s | r+s),
-        # F = (12t, 0 | t+u)  (homogeneous rows)
-        f"           12*q.v*(12*s.v*(t.v + u.v) - 0)\n"
-        f"           - 12*p.v*(0 - 12*t.v*(r.v + s.v))\n"
-        f"           + (p.v + q.v)*(0 - 12*s.v*12*t.v)"
-        f" AS coldet\n"
-        f"         FROM sv p JOIN sv q ON p.v + q.v <> 0\n"
-        f"         JOIN sv r ON true JOIN sv s"
-        f" ON r.v + s.v <> 0\n"
-        f"         JOIN sv t ON true JOIN sv u"
-        f" ON t.v + u.v <> 0)",
-        f"mc AS (SELECT CAST(sum(CASE WHEN\n"
-        f"           (CASE WHEN coldet = 0 THEN 1 ELSE 0 END)"
-        f" <>\n"
-        f"           (CASE WHEN p*r*t = -q*s*u THEN 1 ELSE 0"
-        f" END)\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS menelaus_viol,\n"
-        f"           CAST(sum(CASE WHEN coldet = 0 THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS n_collinear,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_menelaus"
-        f" FROM mn)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        f"SELECT c.ceva_viol, c.n_concurrent, c.n_ceva,\n"
-        f"       m.menelaus_viol, m.n_collinear, m.n_menelaus,\n"
-        f"       l.n_docs\n"
-        f"FROM cc c CROSS JOIN mc m CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q676_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q676_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q676_ceva_menelaus",
-       "WITH " + _q676_join("documents", "//", " MATERIALIZED"))
-def q676(spark, sf_dir):
-    """Ceva's and Menelaus's theorems as exhaustive
-    BICONDITIONALS in exact integer geometry (Ceva 1678,
-    Menelaus ~100 CE; the concurrency/collinearity duality that
-    underlies barycentric reasoning, and — via areal ratios —
-    every triangle-interpolation weighting).  On the lattice
-    triangle A(0,0), B(12,0), C(0,12): for ALL 4096 cevian-foot
-    ratio combinations (p:q, r:s, t:u in 1..4), the three
-    cevian LINES are built with cleared integer coefficients and
-    tested for concurrency by the 3x3 line determinant — and
-    concurrency holds EXACTLY when p*r*t == q*s*u
-    (ceva_viol == 0, n_concurrent == 340): geometry and
-    arithmetic agreeing in both directions at every instance.
-    Menelaus gets the same treatment with SIGNED ratios
-    (external division included, the part diagrams hide): over
-    all 9261 signed combos, the three points' homogeneous
-    3x3 determinant vanishes exactly when p*r*t == -q*s*u
-    (menelaus_viol == 0, n_collinear == 456) — the minus sign
-    that distinguishes the transversal theorem from the cevian
-    one, verified rather than remembered.  Scale: pure
-    expression sweeps over generated ratio dims — classical
-    geometry as integer arithmetic, the repo's exact-predicate
-    discipline applied to theorems."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q676_documents")
-    parts, fin = _q676_sql("q676_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q676_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("r4", "sv", "cv", "mn"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q676_{nm}",
-                      max_rows=16000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q677: Heronian and equable triangles — the complete list of 5
-
-
-def _q677_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"sd AS (SELECT DISTINCT CAST(doc_id % 60 + 1"
-        f" AS BIGINT) AS s FROM {tbl})",
-        f"kd AS (SELECT DISTINCT (a.s - 1)*30 + b.s AS k\n"
-        f"         FROM (SELECT s FROM sd WHERE s <= 57) a\n"
-        f"         CROSS JOIN (SELECT s FROM sd WHERE s <= 30)"
-        f" b\n"
-        f"         WHERE (a.s - 1)*30 + b.s <= 1700)",
-        # all triangles a <= b <= c <= 60 with 16A^2 > 0
-        f"tr AS{{mat}} (SELECT a.s AS a, b.s AS b, c.s AS c,\n"
-        f"           2*(a.s*a.s*b.s*b.s + b.s*b.s*c.s*c.s\n"
-        f"             + c.s*c.s*a.s*a.s)\n"
-        f"           - a.s*a.s*a.s*a.s - b.s*b.s*b.s*b.s\n"
-        f"           - c.s*c.s*c.s*c.s AS s16,\n"
-        f"           a.s + b.s + c.s AS p\n"
-        f"         FROM sd a JOIN sd b ON b.s >= a.s\n"
-        f"         JOIN sd c ON c.s >= b.s"
-        f" AND a.s + b.s > c.s)",
-        # equable: area == perimeter, i.e. 16A^2 == 16 p^2
-        f"eq AS{{mat}} (SELECT a, b, c, p FROM tr\n"
-        f"         WHERE s16 = 16*p*p)",
-        f"ec AS (SELECT CAST(count(*) AS BIGINT) AS n_equable"
-        f" FROM eq)",
-        # Heronian census for c <= 25 via the isqrt dim
-        f"hr AS{{mat}} (SELECT t.a, t.b, t.c, k.k AS area\n"
-        f"         FROM tr t JOIN kd k ON 16*k.k*k.k = t.s16\n"
-        f"         WHERE t.c <= 25 AND t.s16 > 0)",
-        f"hc AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_heronian_25 FROM hr)",
-        # every Pythagorean triple is Heronian
-        f"py AS (SELECT CAST(sum(CASE WHEN h.a IS NULL THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS pyth_viol,\n"
-        f"           CAST(count(*) AS BIGINT) AS n_pyth\n"
-        f"         FROM (SELECT a, b, c FROM tr\n"
-        f"           WHERE c <= 25 AND a*a + b*b = c*c) t\n"
-        f"         LEFT JOIN hr h ON h.a = t.a AND h.b = t.b\n"
-        f"           AND h.c = t.c)",
-        f"sm AS (SELECT CAST(min(area) AS BIGINT)"
-        f" AS smallest_area FROM hr\n"
-        f"         WHERE a = 3 AND b = 4 AND c = 5)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        f"SELECT e.a, e.b, e.c, e.p AS perimeter_and_area,\n"
-        f"       c2.n_equable, h.n_heronian_25,\n"
-        f"       y.pyth_viol, y.n_pyth, s.smallest_area,\n"
-        f"       l.n_docs\n"
-        f"FROM eq e CROSS JOIN ec c2 CROSS JOIN hc h\n"
-        f"CROSS JOIN py y CROSS JOIN sm s CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q677_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q677_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q677_equable_triangles",
-       "WITH " + _q677_join("documents", "//", " MATERIALIZED"))
-def q677(spark, sf_dir):
-    """Equable and Heronian triangles — the famous complete list
-    of FIVE, found by exhaustion, beside the integer-area census
-    (Heron ~60 CE; the equable classification is a classic
-    'there are exactly five' result usually proved with
-    inequalities, here simply enumerated).  All integer
-    triangles with sides up to 60 materialize with 16 * area^2
-    from Heron's polynomial (pure integer, no square root);
-    the EQUABLE condition area == perimeter becomes the integer
-    equation 16A^2 == 16p^2, and exactly n_equable == 5
-    triangles satisfy it: (5,12,13), (6,8,10), (6,25,29),
-    (7,15,20), (9,10,17) — the complete classification, each
-    emitted with its shared perimeter-and-area value, and the
-    side bound 60 genuinely sufficient (the largest, (6,25,29),
-    sits well inside).  The Heronian census for sides <= 25
-    counts n_heronian_25 == 27 integer-area triangles via the
-    isqrt dim (16 k^2 == Heron), smallest the (3,4,5) at
-    area 6; every Pythagorean triple in range is Heronian
-    (pyth_viol == 0 — right triangles are the degenerate-
-    altitude case of Heron's formula, checked).  Scale: one
-    bounded triple enumeration + dim joins; classification
-    theorems as filters."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q677_documents")
-    parts, fin = _q677_sql("q677_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q677_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("sd", "kd", "tr", "eq", "hr"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q677_{nm}",
-                      max_rows=40000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q678: Pell's equation — group completeness by exhaustion
-
-
-def _q678_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"yd AS (SELECT DISTINCT a.x*49 + b.x AS y\n"
-        f"         FROM (SELECT CAST(doc_id % 49 AS BIGINT)"
-        f" AS x FROM {tbl}) a\n"
-        f"         CROSS JOIN (SELECT CAST(doc_id % 49"
-        f" AS BIGINT) AS x FROM {tbl}) b\n"
-        f"         WHERE a.x*49 + b.x <= 2378)",
-        f"xd AS (SELECT DISTINCT a.x*69 + b.x AS x\n"
-        f"         FROM (SELECT CAST(doc_id % 49 AS BIGINT)"
-        f" AS x FROM {tbl}) a\n"
-        f"         CROSS JOIN (SELECT CAST(doc_id % 69"
-        f" AS BIGINT) AS x FROM {tbl}) b\n"
-        f"         WHERE a.x*69 + b.x <= 3363)",
-        f"sp AS{{mat}} (SELECT x.x, y.y FROM xd x JOIN yd y\n"
-        f"           ON x.x*x.x - 2*y.y*y.y = 1)",
-        f"sn AS{{mat}} (SELECT x.x, y.y FROM xd x JOIN yd y\n"
-        f"           ON x.x*x.x - 2*y.y*y.y = -1)",
-        "o0 AS (SELECT CAST(1 AS BIGINT) AS n, CAST(1 AS"
-        " BIGINT) AS a, CAST(1 AS BIGINT) AS b)",
-    ]
-    for k in range(1, 11):
-        parts.append(
-            f"o{k} AS (SELECT n + 1 AS n, a + 2*b AS a,"
-            f" a + b AS b FROM o{k - 1})")
-    orb = "\n         UNION ALL ".join(
-        f"SELECT n, a, b FROM o{k}" for k in range(11))
-    parts.append(f"ob AS{{mat}} ({orb})")
-    parts.append(
-        "pvv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN o.a IS NULL THEN 1"
-        " ELSE 0 END) AS BIGINT) AS plus_unmatched,\n"
-        "           CAST(count(*) AS BIGINT) AS n_plus\n"
-        "         FROM sp s LEFT JOIN ob o ON o.a = s.x\n"
-        "           AND o.b = s.y AND o.n % 2 = 0\n"
-        "         WHERE s.y >= 1)")
-    parts.append(
-        "nvv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN o.a IS NULL THEN 1"
-        " ELSE 0 END) AS BIGINT) AS minus_unmatched,\n"
-        "           CAST(count(*) AS BIGINT) AS n_minus\n"
-        "         FROM sn s LEFT JOIN ob o ON o.a = s.x\n"
-        "           AND o.b = s.y AND o.n % 2 = 1\n"
-        "         WHERE s.x >= 1)")
-    parts.append(
-        "ovv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN a*a - 2*b*b <>\n"
-        "             CASE WHEN n % 2 = 0 THEN 1 ELSE -1 END\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS orbit_norm_viol\n"
-        "         FROM ob)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT o.n, o.a AS x, o.b AS y,\n"
-        f"       o.a*o.a - 2*o.b*o.b AS norm,\n"
-        f"       p.plus_unmatched, p.n_plus,\n"
-        f"       m.minus_unmatched, m.n_minus,\n"
-        f"       v.orbit_norm_viol, l.n_docs\n"
-        f"FROM ob o CROSS JOIN pvv p CROSS JOIN nvv m\n"
-        f"CROSS JOIN ovv v CROSS JOIN ld l\n"
-        f"WHERE o.a <= 3363")
-    return parts, fin
-
-
-def _q678_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q678_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q678_pell",
-       "WITH " + _q678_join("documents", "//", " MATERIALIZED"))
-def q678(spark, sf_dir):
-    """Pell's equation x^2 - 2y^2 = +-1 with the solution group's
-    COMPLETENESS established by exhaustion (Brahmagupta 628,
-    Lagrange 1768; the unit group of Z[sqrt 2], and q603's
-    convergents in disguise — these x/y are exactly the
-    continued-fraction convergents of sqrt 2).  The orbit side
-    computes powers of the fundamental unit 1 + sqrt 2 by the
-    integer recurrence (a, b) -> (a + 2b, a + b), whose norms
-    ALTERNATE between -1 and +1 (orbit_norm_viol == 0 — Pell and
-    negative-Pell solutions interleaved along one orbit, the
-    sign carried by the parity of n).  The exhaustive side
-    sweeps every y to 2378 and x to 3363 for both equations —
-    and every solution found lies ON the orbit at the correct
-    parity (plus_unmatched == 0 over n_plus == 5 nontrivial +1
-    solutions, minus_unmatched == 0 over n_minus == 5 negative
-    ones): no stray solutions below the bound, the finite shadow
-    of 'the fundamental unit generates the whole group'.  The
-    orbit rows (1,1), (3,2), (7,5), (17,12), (41,29), (99,70),
-    ... emit with their norms.  Scale: exhaustion is two dim
-    joins; the orbit is a ten-step linear chain."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q678_documents")
-    parts, fin = _q678_sql("q678_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q678_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("yd", "xd", "sp", "sn", "ob") or \
-                (nm.startswith("o") and nm != "ovv"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q678_{nm}",
-                      max_rows=5000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q679: Markov triples — Vieta tree vs exhaustive grid
-
-
-def _q679_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"md AS (SELECT DISTINCT CAST(doc_id % 100 + 1"
-        f" AS BIGINT) AS v FROM {tbl})",
-        # exhaustive: all ordered triples x <= y <= z <= 100
-        f"ex AS{{mat}} (SELECT x.v AS x, y.v AS y, z.v AS z\n"
-        f"         FROM md x JOIN md y ON y.v >= x.v\n"
-        f"         JOIN md z ON z.v >= y.v\n"
-        f"         WHERE x.v*x.v + y.v*y.v + z.v*z.v =\n"
-        f"           3*x.v*y.v*z.v)",
-        # Vieta tree from (1,1,1): six jump generations, sorted
-        # via least/greatest, deduped, clamped to 100
-        "t0 AS (SELECT CAST(1 AS BIGINT) AS x, CAST(1 AS"
-        " BIGINT) AS y, CAST(1 AS BIGINT) AS z)",
-    ]
-    for g in range(1, 7):
-        arms = ["SELECT x, y, z FROM t{p}".format(p=g - 1)]
-        for i in range(3):
-            ks = ["x", "y", "z"]
-            others = [k for j, k in enumerate(ks) if j != i]
-            new = f"3*{others[0]}*{others[1]} - {ks[i]}"
-            trip = [new if j == i else ks[j] for j in range(3)]
-            a, b, c = trip
-            arms.append(
-                f"SELECT least({a}, {b}, {c}),\n"
-                f"           {a} + {b} + {c} - least({a}, {b},"
-                f" {c}) - greatest({a}, {b}, {c}),\n"
-                f"           greatest({a}, {b}, {c})"
-                f" FROM t{g - 1}\n"
-                f"         WHERE greatest({a}, {b}, {c}) <= 100")
-        parts.append(
-            f"t{g} AS{{mat}} (SELECT DISTINCT x, y, z FROM (\n"
-            f"         " + "\n         UNION ALL ".join(arms)
-            + ") u)")
-    parts.append(
-        "tv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN e.x IS NULL THEN 1"
-        " ELSE 0 END) AS BIGINT) AS tree_not_markov,\n"
-        "           CAST(count(*) AS BIGINT) AS n_tree\n"
-        "         FROM t6 t LEFT JOIN ex e ON e.x = t.x\n"
-        "           AND e.y = t.y AND e.z = t.z)")
-    parts.append(
-        "ev AS (SELECT\n"
-        "           CAST(sum(CASE WHEN t.x IS NULL THEN 1"
-        " ELSE 0 END) AS BIGINT) AS markov_not_tree,\n"
-        "           CAST(count(*) AS BIGINT) AS n_markov\n"
-        "         FROM ex e LEFT JOIN t6 t ON t.x = e.x\n"
-        "           AND t.y = e.y AND t.z = e.z)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT e.x, e.y, e.z,\n"
-        f"       t.tree_not_markov, t.n_tree,\n"
-        f"       v.markov_not_tree, v.n_markov, l.n_docs\n"
-        f"FROM ex e CROSS JOIN tv t CROSS JOIN ev v"
-        f" CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q679_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q679_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q679_markov_triples",
-       "WITH " + _q679_join("documents", "//", " MATERIALIZED"))
-def q679(spark, sf_dir):
-    """Markov triples — the Vieta-jumping tree meets exhaustive
-    search, agreeing exactly (Markov 1879; x^2 + y^2 + z^2 =
-    3xyz governs extremal rational approximation, and Vieta
-    jumping is the descent trick of a thousand olympiad
-    problems, here run FORWARD as a generator).  The exhaustive
-    side sweeps all ordered triples up to 100 through the
-    Markov equation — finding exactly n_markov == 7 solutions:
-    (1,1,1), (1,1,2), (1,2,5), (1,5,13), (1,13,34), (1,34,89),
-    (2,5,29).  The tree side starts at (1,1,1) and applies the
-    three Vieta jumps x -> 3yz - x (each replaces one
-    coordinate by the OTHER root of the quadratic the equation
-    defines), sorted by least/greatest and deduped per
-    generation; six generations saturate the range.  Both
-    containments are checked: every tree node satisfies the
-    equation (tree_not_markov == 0 — the jump preserves the
-    surface, Vieta's actual content) and every exhaustive
-    solution is REACHED by the tree (markov_not_tree == 0 —
-    completeness of the descent in range; the famous UNICITY
-    conjecture, that the largest coordinate determines the
-    triple, is left unclaimed as it remains open).  Scale:
-    grid exhaustion plus a dedup-per-generation frontier —
-    q668's gasket machinery on a Diophantine surface."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q679_documents")
-    parts, fin = _q679_sql("q679_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q679_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("md", "ex") or nm.startswith("t"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q679_{nm}",
-                      max_rows=200000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q680: GF(8) — field axioms and Frobenius by exhaustion
-
-
-_Q680_MUL = '(0, 0, 0), (0, 1, 0), (0, 2, 0), (0, 3, 0), (0, 4, 0), (0, 5, 0), (0, 6, 0), (0, 7, 0), (1, 0, 0), (1, 1, 1), (1, 2, 2), (1, 3, 3), (1, 4, 4), (1, 5, 5), (1, 6, 6), (1, 7, 7), (2, 0, 0), (2, 1, 2), (2, 2, 4), (2, 3, 6), (2, 4, 3), (2, 5, 1), (2, 6, 7), (2, 7, 5), (3, 0, 0), (3, 1, 3), (3, 2, 6), (3, 3, 5), (3, 4, 7), (3, 5, 4), (3, 6, 1), (3, 7, 2), (4, 0, 0), (4, 1, 4), (4, 2, 3), (4, 3, 7), (4, 4, 6), (4, 5, 2), (4, 6, 5), (4, 7, 1), (5, 0, 0), (5, 1, 5), (5, 2, 1), (5, 3, 4), (5, 4, 2), (5, 5, 7), (5, 6, 3), (5, 7, 6), (6, 0, 0), (6, 1, 6), (6, 2, 7), (6, 3, 1), (6, 4, 5), (6, 5, 3), (6, 6, 2), (6, 7, 4), (7, 0, 0), (7, 1, 7), (7, 2, 5), (7, 3, 2), (7, 4, 1), (7, 5, 6), (7, 6, 4), (7, 7, 3)'
-
-
-def _q680_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"el AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS e FROM {tbl})",
-        f"ml AS (SELECT CAST(a AS BIGINT) AS a, CAST(b AS"
-        f" BIGINT) AS b,\n"
-        f"           CAST(m AS BIGINT) AS m FROM (VALUES"
-        f" {_Q680_MUL}) t(a, b, m))",
-        # XOR is GF(2)-addition: build it bitwise via div/mod
-        f"ad AS{{mat}} (SELECT x.e AS a, y.e AS b,\n"
-        f"           CAST(((x.e {{d}} 1) % 2 + (y.e {{d}} 1)"
-        f" % 2) % 2\n"
-        f"           + 2*(((x.e {{d}} 2) % 2 + (y.e {{d}} 2)"
-        f" % 2) % 2)\n"
-        f"           + 4*(((x.e {{d}} 4) % 2 + (y.e {{d}} 4)"
-        f" % 2) % 2) AS BIGINT) AS s\n"
-        f"         FROM el x CROSS JOIN el y)",
-        # associativity of multiplication over all 512 triples
-        f"asx AS (SELECT CAST(sum(CASE WHEN m1.m <> m2.m"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS assoc_viol\n"
-        f"         FROM el a CROSS JOIN el b CROSS JOIN el c\n"
-        f"         JOIN ml ab ON ab.a = a.e AND ab.b = b.e\n"
-        f"         JOIN ml m1 ON m1.a = ab.m AND m1.b = c.e\n"
-        f"         JOIN ml bc ON bc.a = b.e AND bc.b = c.e\n"
-        f"         JOIN ml m2 ON m2.a = a.e AND m2.b = bc.m)",
-        # distributivity a(b + c) == ab + ac over all triples
-        f"dsx AS (SELECT CAST(sum(CASE WHEN l.m <> r.s THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS distrib_viol\n"
-        f"         FROM el a CROSS JOIN el b CROSS JOIN el c\n"
-        f"         JOIN ad s1 ON s1.a = b.e AND s1.b = c.e\n"
-        f"         JOIN ml l ON l.a = a.e AND l.b = s1.s\n"
-        f"         JOIN ml ab ON ab.a = a.e AND ab.b = b.e\n"
-        f"         JOIN ml ac ON ac.a = a.e AND ac.b = c.e\n"
-        f"         JOIN ad r ON r.a = ab.m AND r.b = ac.m)",
-        # inverses, Fermat x^8 == x, Frobenius, generators
-        f"inx AS (SELECT CAST(sum(CASE WHEN inv.n <> 1 THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS inverse_viol"
-        f" FROM (\n"
-        f"           SELECT a.e, CAST(count(*) AS BIGINT) AS n\n"
-        f"           FROM el a JOIN ml m2 ON m2.a = a.e"
-        f" AND m2.m = 1\n"
-        f"           WHERE a.e >= 1 GROUP BY a.e) inv)",
-        f"pw AS{{mat}} (SELECT a.e, CAST(1 AS BIGINT) AS k,"
-        f" a.e AS p\n"
-        f"         FROM el a)",
-    ]
-    for k in range(2, 9):
-        parts.append(
-            f"pw{k} AS{{mat}} (SELECT w.e, CAST({k} AS BIGINT)"
-            f" AS k, m2.m AS p\n"
-            f"         FROM {'pw' if k == 2 else f'pw{k - 1}'} w"
-            f" JOIN ml m2 ON m2.a = w.p AND m2.b = w.e)")
-    allp = "\n         UNION ALL ".join(
-        ["SELECT e, k, p FROM pw"]
-        + [f"SELECT e, k, p FROM pw{k}" for k in range(2, 9)])
-    parts.append(f"pa AS{{mat}} ({allp})")
-    parts.append(
-        "fmx AS (SELECT CAST(sum(CASE WHEN p.p <> p.e THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS fermat_viol\n"
-        "         FROM pa p WHERE p.k = 8)")
-    parts.append(
-        "frx AS (SELECT CAST(sum(CASE WHEN sq.m <> ss.s"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS frobenius_viol\n"
-        "         FROM ad s1\n"
-        "         JOIN ml sq ON sq.a = s1.s AND sq.b = s1.s\n"
-        "         JOIN ml qa ON qa.a = s1.a AND qa.b = s1.a\n"
-        "         JOIN ml qb ON qb.a = s1.b AND qb.b = s1.b\n"
-        "         JOIN ad ss ON ss.a = qa.m AND ss.b = qb.m)")
-    parts.append(
-        "gnx AS (SELECT CAST(count(*) AS BIGINT)"
-        " AS n_generators FROM (\n"
-        "           SELECT e FROM pa WHERE k <= 7 AND e >= 2\n"
-        "           GROUP BY e"
-        " HAVING count(DISTINCT p) = 7) t)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT a.assoc_viol, d2.distrib_viol, i.inverse_viol,\n"
-        f"       f.fermat_viol, r.frobenius_viol,\n"
-        f"       g.n_generators, l.n_docs\n"
-        f"FROM asx a CROSS JOIN dsx d2 CROSS JOIN inx i\n"
-        f"CROSS JOIN fmx f CROSS JOIN frx r CROSS JOIN gnx g\n"
-        f"CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q680_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q680_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q680_gf8_axioms",
-       "WITH " + _q680_join("documents", "//", " MATERIALIZED"))
-def q680(spark, sf_dir):
-    """GF(8) certified as a field by total exhaustion — the
-    smallest non-prime field with every axiom and its signature
-    automorphism measured (Galois 1830; this arithmetic runs
-    under q468's Reed-Solomon tables and q637's secret sharing,
-    here PROVEN rather than imported).  Elements are the eight
-    bit-polynomials mod x^3 + x + 1; addition is bitwise XOR
-    built from div/mod, multiplication an inlined 64-entry
-    table.  The axioms go down by enumeration: associativity
-    over all 512 triples (assoc_viol == 0), distributivity over
-    all 512 (distrib_viol == 0 — the axiom that makes it a RING
-    rather than two unrelated groups), a multiplicative inverse
-    for every one of the 7 nonzero elements, each UNIQUE
-    (inverse_viol == 0 counts exactly one per element).  The
-    structure theorems follow: x^8 == x for every element
-    (fermat_viol == 0 — the field polynomial identity), the
-    FROBENIUS map x -> x^2 is additive on every pair
-    ((a+b)^2 == a^2 + b^2, frobenius_viol == 0 — the freshman's
-    dream, true here and diagnostic of characteristic 2), and
-    ALL six elements outside {0,1} generate the multiplicative
-    group (n_generators == 6 — cyclic of prime order 7, so
-    every non-identity generates).  Scale: dims of size 8;
-    certification by joins, the field table audit any coding
-    stack should run once."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q680_documents")
-    parts, fin = _q680_sql("q680_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q680_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("el", "ml", "ad", "pa") or \
-                nm.startswith("pw"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q680_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q681: the five groups of order 8 — classified by computation
-
-
-_Q681_TABLES = '(1, 0, 0, 0), (1, 0, 1, 1), (1, 0, 2, 2), (1, 0, 3, 3), (1, 0, 4, 4), (1, 0, 5, 5), (1, 0, 6, 6), (1, 0, 7, 7), (1, 1, 0, 1), (1, 1, 1, 2), (1, 1, 2, 3), (1, 1, 3, 4), (1, 1, 4, 5), (1, 1, 5, 6), (1, 1, 6, 7), (1, 1, 7, 0), (1, 2, 0, 2), (1, 2, 1, 3), (1, 2, 2, 4), (1, 2, 3, 5), (1, 2, 4, 6), (1, 2, 5, 7), (1, 2, 6, 0), (1, 2, 7, 1), (1, 3, 0, 3), (1, 3, 1, 4), (1, 3, 2, 5), (1, 3, 3, 6), (1, 3, 4, 7), (1, 3, 5, 0), (1, 3, 6, 1), (1, 3, 7, 2), (1, 4, 0, 4), (1, 4, 1, 5), (1, 4, 2, 6), (1, 4, 3, 7), (1, 4, 4, 0), (1, 4, 5, 1), (1, 4, 6, 2), (1, 4, 7, 3), (1, 5, 0, 5), (1, 5, 1, 6), (1, 5, 2, 7), (1, 5, 3, 0), (1, 5, 4, 1), (1, 5, 5, 2), (1, 5, 6, 3), (1, 5, 7, 4), (1, 6, 0, 6), (1, 6, 1, 7), (1, 6, 2, 0), (1, 6, 3, 1), (1, 6, 4, 2), (1, 6, 5, 3), (1, 6, 6, 4), (1, 6, 7, 5), (1, 7, 0, 7), (1, 7, 1, 0), (1, 7, 2, 1), (1, 7, 3, 2), (1, 7, 4, 3), (1, 7, 5, 4), (1, 7, 6, 5), (1, 7, 7, 6), (2, 0, 0, 0), (2, 0, 1, 1), (2, 0, 2, 2), (2, 0, 3, 3), (2, 0, 4, 4), (2, 0, 5, 5), (2, 0, 6, 6), (2, 0, 7, 7), (2, 1, 0, 1), (2, 1, 1, 0), (2, 1, 2, 3), (2, 1, 3, 2), (2, 1, 4, 5), (2, 1, 5, 4), (2, 1, 6, 7), (2, 1, 7, 6), (2, 2, 0, 2), (2, 2, 1, 3), (2, 2, 2, 4), (2, 2, 3, 5), (2, 2, 4, 6), (2, 2, 5, 7), (2, 2, 6, 0), (2, 2, 7, 1), (2, 3, 0, 3), (2, 3, 1, 2), (2, 3, 2, 5), (2, 3, 3, 4), (2, 3, 4, 7), (2, 3, 5, 6), (2, 3, 6, 1), (2, 3, 7, 0), (2, 4, 0, 4), (2, 4, 1, 5), (2, 4, 2, 6), (2, 4, 3, 7), (2, 4, 4, 0), (2, 4, 5, 1), (2, 4, 6, 2), (2, 4, 7, 3), (2, 5, 0, 5), (2, 5, 1, 4), (2, 5, 2, 7), (2, 5, 3, 6), (2, 5, 4, 1), (2, 5, 5, 0), (2, 5, 6, 3), (2, 5, 7, 2), (2, 6, 0, 6), (2, 6, 1, 7), (2, 6, 2, 0), (2, 6, 3, 1), (2, 6, 4, 2), (2, 6, 5, 3), (2, 6, 6, 4), (2, 6, 7, 5), (2, 7, 0, 7), (2, 7, 1, 6), (2, 7, 2, 1), (2, 7, 3, 0), (2, 7, 4, 3), (2, 7, 5, 2), (2, 7, 6, 5), (2, 7, 7, 4), (3, 0, 0, 0), (3, 0, 1, 1), (3, 0, 2, 2), (3, 0, 3, 3), (3, 0, 4, 4), (3, 0, 5, 5), (3, 0, 6, 6), (3, 0, 7, 7), (3, 1, 0, 1), (3, 1, 1, 0), (3, 1, 2, 3), (3, 1, 3, 2), (3, 1, 4, 5), (3, 1, 5, 4), (3, 1, 6, 7), (3, 1, 7, 6), (3, 2, 0, 2), (3, 2, 1, 3), (3, 2, 2, 0), (3, 2, 3, 1), (3, 2, 4, 6), (3, 2, 5, 7), (3, 2, 6, 4), (3, 2, 7, 5), (3, 3, 0, 3), (3, 3, 1, 2), (3, 3, 2, 1), (3, 3, 3, 0), (3, 3, 4, 7), (3, 3, 5, 6), (3, 3, 6, 5), (3, 3, 7, 4), (3, 4, 0, 4), (3, 4, 1, 5), (3, 4, 2, 6), (3, 4, 3, 7), (3, 4, 4, 0), (3, 4, 5, 1), (3, 4, 6, 2), (3, 4, 7, 3), (3, 5, 0, 5), (3, 5, 1, 4), (3, 5, 2, 7), (3, 5, 3, 6), (3, 5, 4, 1), (3, 5, 5, 0), (3, 5, 6, 3), (3, 5, 7, 2), (3, 6, 0, 6), (3, 6, 1, 7), (3, 6, 2, 4), (3, 6, 3, 5), (3, 6, 4, 2), (3, 6, 5, 3), (3, 6, 6, 0), (3, 6, 7, 1), (3, 7, 0, 7), (3, 7, 1, 6), (3, 7, 2, 5), (3, 7, 3, 4), (3, 7, 4, 3), (3, 7, 5, 2), (3, 7, 6, 1), (3, 7, 7, 0), (4, 0, 0, 0), (4, 0, 1, 1), (4, 0, 2, 2), (4, 0, 3, 3), (4, 0, 4, 4), (4, 0, 5, 5), (4, 0, 6, 6), (4, 0, 7, 7), (4, 1, 0, 1), (4, 1, 1, 2), (4, 1, 2, 3), (4, 1, 3, 0), (4, 1, 4, 5), (4, 1, 5, 6), (4, 1, 6, 7), (4, 1, 7, 4), (4, 2, 0, 2), (4, 2, 1, 3), (4, 2, 2, 0), (4, 2, 3, 1), (4, 2, 4, 6), (4, 2, 5, 7), (4, 2, 6, 4), (4, 2, 7, 5), (4, 3, 0, 3), (4, 3, 1, 0), (4, 3, 2, 1), (4, 3, 3, 2), (4, 3, 4, 7), (4, 3, 5, 4), (4, 3, 6, 5), (4, 3, 7, 6), (4, 4, 0, 4), (4, 4, 1, 7), (4, 4, 2, 6), (4, 4, 3, 5), (4, 4, 4, 0), (4, 4, 5, 3), (4, 4, 6, 2), (4, 4, 7, 1), (4, 5, 0, 5), (4, 5, 1, 4), (4, 5, 2, 7), (4, 5, 3, 6), (4, 5, 4, 1), (4, 5, 5, 0), (4, 5, 6, 3), (4, 5, 7, 2), (4, 6, 0, 6), (4, 6, 1, 5), (4, 6, 2, 4), (4, 6, 3, 7), (4, 6, 4, 2), (4, 6, 5, 1), (4, 6, 6, 0), (4, 6, 7, 3), (4, 7, 0, 7), (4, 7, 1, 6), (4, 7, 2, 5), (4, 7, 3, 4), (4, 7, 4, 3), (4, 7, 5, 2), (4, 7, 6, 1), (4, 7, 7, 0), (5, 0, 0, 0), (5, 0, 1, 1), (5, 0, 2, 2), (5, 0, 3, 3), (5, 0, 4, 4), (5, 0, 5, 5), (5, 0, 6, 6), (5, 0, 7, 7), (5, 1, 0, 1), (5, 1, 1, 0), (5, 1, 2, 3), (5, 1, 3, 2), (5, 1, 4, 5), (5, 1, 5, 4), (5, 1, 6, 7), (5, 1, 7, 6), (5, 2, 0, 2), (5, 2, 1, 3), (5, 2, 2, 1), (5, 2, 3, 0), (5, 2, 4, 6), (5, 2, 5, 7), (5, 2, 6, 5), (5, 2, 7, 4), (5, 3, 0, 3), (5, 3, 1, 2), (5, 3, 2, 0), (5, 3, 3, 1), (5, 3, 4, 7), (5, 3, 5, 6), (5, 3, 6, 4), (5, 3, 7, 5), (5, 4, 0, 4), (5, 4, 1, 5), (5, 4, 2, 7), (5, 4, 3, 6), (5, 4, 4, 1), (5, 4, 5, 0), (5, 4, 6, 2), (5, 4, 7, 3), (5, 5, 0, 5), (5, 5, 1, 4), (5, 5, 2, 6), (5, 5, 3, 7), (5, 5, 4, 0), (5, 5, 5, 1), (5, 5, 6, 3), (5, 5, 7, 2), (5, 6, 0, 6), (5, 6, 1, 7), (5, 6, 2, 4), (5, 6, 3, 5), (5, 6, 4, 3), (5, 6, 5, 2), (5, 6, 6, 1), (5, 6, 7, 0), (5, 7, 0, 7), (5, 7, 1, 6), (5, 7, 2, 5), (5, 7, 3, 4), (5, 7, 4, 2), (5, 7, 5, 3), (5, 7, 6, 0), (5, 7, 7, 1)'
-
-
-def _q681_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"el AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS e FROM {tbl})",
-        f"gt AS (SELECT CAST(g AS BIGINT) AS g, CAST(a AS"
-        f" BIGINT) AS a,\n"
-        f"           CAST(b AS BIGINT) AS b, CAST(m AS BIGINT)"
-        f" AS m\n"
-        f"         FROM (VALUES {_Q681_TABLES}) t(g, a, b, m))",
-        # associativity per group over all 512 triples
-        f"asx AS (SELECT g, CAST(sum(viol) AS BIGINT)"
-        f" AS assoc_viol FROM (\n"
-        f"           SELECT ab.g, CASE WHEN m1.m <> m2.m THEN 1"
-        f" ELSE 0 END AS viol\n"
-        f"           FROM gt ab\n"
-        f"           JOIN gt m1 ON m1.g = ab.g AND m1.a = ab.m\n"
-        f"           JOIN gt bc ON bc.g = ab.g AND bc.a = ab.b\n"
-        f"             AND bc.b = m1.b\n"
-        f"           JOIN gt m2 ON m2.g = ab.g AND m2.a = ab.a\n"
-        f"             AND m2.b = bc.m) t GROUP BY g)",
-        # identity 0 and inverses per group
-        f"idx AS (SELECT g,\n"
-        f"           CAST(sum(CASE WHEN (a = 0 AND m <> b) OR\n"
-        f"             (b = 0 AND m <> a) THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS identity_viol\n"
-        f"         FROM gt GROUP BY g)",
-        f"ivx AS (SELECT g, CAST(sum(CASE WHEN n <> 1 THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS inverse_viol"
-        f" FROM (\n"
-        f"           SELECT g, a, CAST(count(*) AS BIGINT) AS n\n"
-        f"           FROM gt WHERE m = 0 GROUP BY g, a) t\n"
-        f"         GROUP BY g)",
-        # element orders via 8 staged powers
-        f"p1 AS (SELECT g, a AS e, a AS p, CAST(1 AS BIGINT)"
-        f" AS k\n"
-        f"         FROM gt WHERE b = 0)",
-    ]
-    for k in range(2, 9):
-        parts.append(
-            f"p{k} AS (SELECT w.g, w.e, t.m AS p,"
-            f" CAST({k} AS BIGINT) AS k\n"
-            f"         FROM p{k - 1} w JOIN gt t ON t.g = w.g\n"
-            f"           AND t.a = w.p AND t.b = w.e)")
-    allp = "\n         UNION ALL ".join(
-        f"SELECT g, e, p, k FROM p{k}" for k in range(1, 9))
-    parts.append(f"pa AS{{mat}} ({allp})")
-    parts.append(
-        "od AS{mat} (SELECT g, e, CAST(min(k) AS BIGINT)"
-        " AS ord\n"
-        "         FROM pa WHERE p = 0 GROUP BY g, e)")
-    # order profile packed: counts of orders 1,2,4,8 base 9
-    parts.append(
-        "pf AS{mat} (SELECT g,\n"
-        "           CAST(sum(CASE WHEN ord = 2 THEN 1 ELSE 0"
-        " END)\n"
-        "           + 9*sum(CASE WHEN ord = 4 THEN 1 ELSE 0"
-        " END)\n"
-        "           + 81*sum(CASE WHEN ord = 8 THEN 1 ELSE 0"
-        " END) AS BIGINT) AS profile\n"
-        "         FROM od GROUP BY g)")
-    parts.append(
-        "dst AS (SELECT CAST(count(DISTINCT profile) AS BIGINT)"
-        " AS n_distinct_profiles,\n"
-        "           CAST(count(*) AS BIGINT) AS n_groups"
-        " FROM pf)")
-    # abelianness per group (commutator check over all pairs)
-    parts.append(
-        "abx AS (SELECT f.g, CAST(sum(CASE WHEN f.m <> r.m"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS n_noncommuting\n"
-        "         FROM gt f JOIN gt r ON r.g = f.g"
-        " AND r.a = f.b\n"
-        "           AND r.b = f.a GROUP BY f.g)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT a.g, a.assoc_viol, i.identity_viol,\n"
-        f"       v.inverse_viol, p.profile, b.n_noncommuting,\n"
-        f"       s.n_distinct_profiles, s.n_groups, l.n_docs\n"
-        f"FROM asx a JOIN idx i ON i.g = a.g\n"
-        f"JOIN ivx v ON v.g = a.g JOIN pf p ON p.g = a.g\n"
-        f"JOIN abx b ON b.g = a.g\n"
-        f"CROSS JOIN dst s CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q681_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q681_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q681_groups_of_order_8",
-       "WITH " + _q681_join("documents", "//", " MATERIALIZED"))
-def q681(spark, sf_dir):
-    """The five groups of order 8, certified and told apart by
-    computation (the first interesting case of the finite-group
-    classification: three abelian — C8, C4xC2, C2^3 — plus the
-    dihedral D4 and the quaternion Q8).  All five multiplication
-    tables verify their axioms by exhaustion — associativity
-    over 512 triples EACH (assoc_viol == 0 five times, the
-    axiom that makes a Latin square a group), two-sided identity
-    and unique inverses per element — and are then SEPARATED by
-    the order-profile invariant (counts of elements of order
-    2/4/8, packed base-9): n_distinct_profiles == 5, so no two
-    are isomorphic, with the classic near-miss visible in the
-    rows — D4 and Q8 are BOTH nonabelian with exactly 24
-    noncommuting ordered pairs each (the abelian three at 0),
-    so commutativity alone cannot separate them; the profile
-    can: D4 has five involutions, Q8 exactly one (its -1) —
-    the invariant doing the work an explicit isomorphism
-    search would.  Scale:
-    broadcast tables; group axioms as joins — the multiplication
-    -table audit for any algebraic codec."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q681_documents")
-    parts, fin = _q681_sql("q681_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q681_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("el", "gt", "pa", "od", "pf") or \
-                (nm.startswith("p") and nm not in ("pf",)):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q681_{nm}",
-                      max_rows=3000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q682: Sicherman dice — uniqueness by exhaustion
-
-
-def _q682_sql(tbl: str, d: str, mat: str):
-    tgt = ", ".join(f"({s}, {c})" for s, c in
-                    [(2, 1), (3, 2), (4, 3), (5, 4), (6, 5),
-                     (7, 6), (8, 5), (9, 4), (10, 3), (11, 2),
-                     (12, 1)])
-    parts = [
-        f"fd AS (SELECT DISTINCT CAST(doc_id % 8 + 1"
-        f" AS BIGINT) AS f FROM {tbl})",
-        f"tg AS (SELECT CAST(s AS BIGINT) AS s, CAST(c AS"
-        f" BIGINT) AS c FROM (VALUES {tgt}) t(s, c))",
-        # ascending face chains, min face pinned at 1
-        "c1 AS (SELECT f AS f1 FROM fd WHERE f = 1)",
-    ]
-    for k in range(2, 7):
-        cols = ", ".join(f"f{i}" for i in range(1, k))
-        parts.append(
-            f"c{k} AS (SELECT {cols}, g.f AS f{k}\n"
-            f"         FROM c{k - 1} c JOIN fd g"
-            f" ON g.f >= c.f{k - 1})")
-    pack = " + ".join(f"f{i}*{9 ** (i - 1)}" for i in range(1, 7))
-    parts.append(
-        f"dc AS{{mat}} (SELECT {pack} AS id, f1, f2, f3, f4,"
-        f" f5, f6,\n"
-        f"           f1 + f2 + f3 + f4 + f5 + f6 AS fsum"
-        f" FROM c6)")
-    faces = "\n         UNION ALL ".join(
-        f"SELECT id, f{i} AS f FROM dc" for i in range(1, 7))
-    parts.append(f"fc AS{{mat}} ({faces})")
-    # pair sum distributions vs the 2d6 target
-    parts.append(
-        f"pd AS{{mat}} (SELECT a.id AS ia, b.id AS ib,\n"
-        f"           fa.f + fb.f AS s,"
-        f" CAST(count(*) AS BIGINT) AS c\n"
-        f"         FROM dc a JOIN dc b ON b.id >= a.id\n"
-        f"           AND a.fsum + b.fsum = 42\n"
-        f"         JOIN fc fa ON fa.id = a.id\n"
-        f"         JOIN fc fb ON fb.id = b.id\n"
-        f"         GROUP BY a.id, b.id, fa.f + fb.f)")
-    parts.append(
-        f"mt AS{{mat}} (SELECT p.ia, p.ib FROM pd p\n"
-        f"         LEFT JOIN tg t ON t.s = p.s AND t.c = p.c\n"
-        f"         GROUP BY p.ia, p.ib\n"
-        f"         HAVING count(*) = 11 AND"
-        f" count(t.s) = 11)")
-    parts.append(
-        "mc AS (SELECT CAST(count(*) AS BIGINT)"
-        " AS n_matching_pairs FROM mt)")
-    parts.append(
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})")
-    fin = (
-        f"SELECT m.ia, m.ib,\n"
-        f"       da.f1 AS a1, da.f2 AS a2, da.f3 AS a3,"
-        f" da.f4 AS a4, da.f5 AS a5, da.f6 AS a6,\n"
-        f"       db.f1 AS b1, db.f2 AS b2, db.f3 AS b3,"
-        f" db.f4 AS b4, db.f5 AS b5, db.f6 AS b6,\n"
-        f"       da.fsum AS sum_a, db.fsum AS sum_b,\n"
-        f"       c.n_matching_pairs, l.n_docs\n"
-        f"FROM mt m JOIN dc da ON da.id = m.ia\n"
-        f"JOIN dc db ON db.id = m.ib\n"
-        f"CROSS JOIN mc c CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q682_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q682_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat)
-        if mat:
-            p = re.sub(r"^(\w+) AS \(", rf"\1 AS{mat} (", p)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q682_sicherman_dice",
-       "WITH " + _q682_join("documents", "//", " MATERIALIZED"))
-def q682(spark, sf_dir):
-    """Sicherman dice — the ONLY alternative pair of dice with
-    the standard 2d6 sum distribution, found and proven unique
-    by exhaustion (Sicherman 1978, popularized by Gardner; the
-    cyclotomic-factorization result, here settled by sweeping
-    the whole search space).  All 792 six-face dice with
-    positive faces at most 8 and minimum face 1 enumerate by
-    ascending chains; candidate PAIRS are pruned by the forced
-    total (both dice's face sums must total 42, since the sum
-    distribution fixes the mean) and each surviving pair's full
-    36-outcome histogram is compared against the 2d6 target at
-    all 11 sum values.  Exactly n_matching_pairs == 2 survive:
-    the standard pair itself, and (1,2,2,3,3,4) with
-    (1,3,4,5,6,8) — the Sicherman pair, emitted face by face
-    with its lopsided 15/27 face-sum split.  Within the stated
-    face bound this IS the uniqueness theorem: no third pair
-    exists, verified rather than factored.  Scale: the pair
-    histogram join is the heavy stage (hundreds of thousands of
-    pairs x 36 outcomes) and is exactly the
-    aggregate-then-filter shape that distributes."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q682_documents")
-    parts, fin = _q682_sql("q682_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q682_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("fd", "tg", "dc", "fc", "pd", "mt") or \
-                nm.startswith("c"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q682_{nm}",
-                      max_rows=4000000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q683: Efron's nontransitive dice — the 2/3 cycle computed
-
-
-_Q683_DICE = {0: (4, 4, 4, 4, 0, 0), 1: (3, 3, 3, 3, 3, 3),
-              2: (6, 6, 2, 2, 2, 2), 3: (5, 5, 5, 1, 1, 1)}
-
-
-def _q683_sql(tbl: str, d: str, mat: str) -> str:
-    fv = ", ".join(f"({i}, {f})" for i, die in _Q683_DICE.items()
-                   for f in die)
-    return (
-        f"fd AS (SELECT CAST(i AS BIGINT) AS i, CAST(f AS"
-        f" BIGINT) AS f FROM (VALUES {fv}) t(i, f)),\n"
-        f"       bt AS{mat} (SELECT a.i AS ia, b.i AS ib,\n"
-        f"           CAST(sum(CASE WHEN a.f > b.f THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS wins,\n"
-        f"           CAST(sum(CASE WHEN a.f = b.f THEN 1"
-        f" ELSE 0 END) AS BIGINT) AS ties\n"
-        f"         FROM fd a JOIN fd b ON b.i <> a.i\n"
-        f"         GROUP BY a.i, b.i),\n"
-        f"       cy AS (SELECT CAST(sum(CASE WHEN b.wins <> 24"
-        f" THEN 1\n"
-        f"           ELSE 0 END) AS BIGINT) AS cycle_viol\n"
-        f"         FROM bt b WHERE b.ib = (b.ia + 1) % 4),\n"
-        f"       nw AS (SELECT CAST(max(nbeat) AS BIGINT)"
-        f" AS max_beaten,\n"
-        f"           CAST(min(nbeaten_by) AS BIGINT)"
-        f" AS min_beaten_by FROM (\n"
-        f"           SELECT ia, sum(CASE WHEN wins > 18 THEN 1\n"
-        f"             ELSE 0 END) AS nbeat,\n"
-        f"             sum(CASE WHEN wins < 18 - ties + ties"
-        f" AND wins*2 + ties < 36 THEN 1 ELSE 0 END)"
-        f" AS nbeaten_by\n"
-        f"           FROM bt GROUP BY ia) t),\n"
-        f"       ev AS{mat} (SELECT i,"
-        f" CAST(sum(f) AS BIGINT) AS fsum\n"
-        f"         FROM fd GROUP BY i),\n"
-        f"       ld AS (SELECT CAST(count(*) AS BIGINT)"
-        f" AS n_docs FROM {tbl})\n"
-        f"SELECT b.ia, b.ib, b.wins, b.ties,\n"
-        f"       c.cycle_viol, n.max_beaten, n.min_beaten_by,\n"
-        f"       ea.fsum AS sum_a, l.n_docs\n"
-        f"FROM bt b JOIN ev ea ON ea.i = b.ia\n"
-        f"CROSS JOIN cy c CROSS JOIN nw n CROSS JOIN ld l")
-
-
-@query("q683_efron_dice",
-       "WITH " + _q683_sql("documents", "//", " MATERIALIZED"))
-def q683(spark, sf_dir):
-    """Efron's nontransitive dice — the beating cycle computed
-    exactly over all 36-outcome matchups (Efron via Gardner
-    1970; the standard counterexample to 'better than' being an
-    order, and the reason pairwise win-rates cannot rank
-    models).  The four dice's full 4x3 beats matrix computes by
-    one face-grid join; the famous CYCLE holds exactly — each
-    die beats its successor in 24 of 36 outcomes, probability
-    2/3, around the whole ring (cycle_viol == 0) — and
-    nontransitivity is structural: no die beats all three
-    others (max_beaten < 3) while every die is beaten by at
-    least one (min_beaten_by >= 1) — there is provably no best
-    die, a Condorcet cycle (q588) among dice.  Face sums emit
-    per matchup row: the dice do not even share a mean, yet the
-    cycle persists — dominance and expectation dissociated in
-    one table.  Scale: a 24-row dim and one grouped join; the
-    paradox costs nothing to verify and embarrassment to
-    ignore."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q683_documents")
-    return spark.sql(
-        "WITH " + _q683_sql("q683_documents", "div", ""))
-
-
-# ---------------------------------------------------------------------------
-# q684: Gale–Shapley stable matching — deferred acceptance vs
-# total 24-matching exhaustion, with the full theorem suite
-
-
-# preference fixture (4 men x 4 women, quadratic-hash derived so the
-# proposal rounds genuinely conflict): mp[m] = women in order,
-# wp[w] = men in order.  Chosen so the instance has THREE stable
-# matchings and round-synchronous GS takes five rounds.
-_Q684_MP = ((0, 2, 1, 3), (3, 0, 1, 2), (0, 3, 2, 1), (1, 2, 3, 0))
-_Q684_WP = ((0, 3, 1, 2), (2, 1, 0, 3), (1, 2, 3, 0), (3, 2, 1, 0))
-
-_Q684_MR = ", ".join(
-    f"({m}, {w}, {r})" for m, lst in enumerate(_Q684_MP)
-    for r, w in enumerate(lst))
-_Q684_WR = ", ".join(
-    f"({w}, {m}, {r})" for w, lst in enumerate(_Q684_WP)
-    for r, m in enumerate(lst))
-_Q684_MPV = ", ".join(
-    f"({m}, {p}, {w})" for m, lst in enumerate(_Q684_MP)
-    for p, w in enumerate(lst))
-
-_Q684_PW = ("CASE WHEN {c} = 0 THEN 64 WHEN {c} = 1 THEN 16 "
-            "WHEN {c} = 2 THEN 4 ELSE 1 END")
-
-
-def _q684_sql(tbl: str, d: str, mat: str):
-    pw_m = _Q684_PW.format(c="a.m")
-    parts = [
-        f"el AS (SELECT DISTINCT CAST(doc_id % 4 AS BIGINT)"
-        f" AS e FROM {tbl})",
-        f"mrk AS (SELECT CAST(m AS BIGINT) AS m, CAST(w AS"
-        f" BIGINT) AS w,\n"
-        f"           CAST(r AS BIGINT) AS r FROM (VALUES"
-        f" {_Q684_MR}) t(m, w, r))",
-        f"wrk AS (SELECT CAST(w AS BIGINT) AS w, CAST(m AS"
-        f" BIGINT) AS m,\n"
-        f"           CAST(r AS BIGINT) AS r FROM (VALUES"
-        f" {_Q684_WR}) t(w, m, r))",
-        f"mpv AS (SELECT CAST(m AS BIGINT) AS m, CAST(p AS"
-        f" BIGINT) AS p,\n"
-        f"           CAST(w AS BIGINT) AS w FROM (VALUES"
-        f" {_Q684_MPV}) t(m, p, w))",
-        # all 24 perfect matchings, packed base-4
-        "pm AS{mat} (SELECT a.e AS w0, b.e AS w1, c.e AS w2,"
-        " d2.e AS w3,\n"
-        "           a.e*64 + b.e*16 + c.e*4 + d2.e AS code\n"
-        "         FROM el a JOIN el b ON b.e <> a.e\n"
-        "         JOIN el c ON c.e <> a.e AND c.e <> b.e\n"
-        "         JOIN el d2 ON d2.e <> a.e AND d2.e <> b.e\n"
-        "           AND d2.e <> c.e)",
-        # unpivot to (code, m, w) rows
-        "asg AS{mat} (SELECT code, CAST(0 AS BIGINT) AS m,"
-        " w0 AS w FROM pm\n"
-        "         UNION ALL SELECT code, 1, w1 FROM pm\n"
-        "         UNION ALL SELECT code, 2, w2 FROM pm\n"
-        "         UNION ALL SELECT code, 3, w3 FROM pm)",
-        # matchings admitting a blocking pair (m prefers w to his
-        # partner AND w prefers m to hers)
-        "blk AS (SELECT DISTINCT a1.code\n"
-        "         FROM asg a1 JOIN asg a2 ON a2.code = a1.code\n"
-        "         JOIN mrk r1 ON r1.m = a1.m AND r1.w = a2.w\n"
-        "         JOIN mrk r2 ON r2.m = a1.m AND r2.w = a1.w\n"
-        "         JOIN wrk r3 ON r3.w = a2.w AND r3.m = a1.m\n"
-        "         JOIN wrk r4 ON r4.w = a2.w AND r4.m = a2.m\n"
-        "         WHERE r1.r < r2.r AND r3.r < r4.r)",
-        "stb AS{mat} (SELECT p.code FROM pm p\n"
-        "         LEFT JOIN blk b ON b.code = p.code\n"
-        "         WHERE b.code IS NULL)",
-        # round-synchronous deferred acceptance, 5 unrolled rounds
-        "gs0 AS{mat} (SELECT e AS m, CAST(0 AS BIGINT) AS ptr,\n"
-        "           CAST(-1 AS BIGINT) AS w FROM el)",
-    ]
-    for r in range(1, 6):
-        p = f"gs{r - 1}"
-        parts.append(
-            f"gs{r} AS{{mat}} (SELECT s.m,\n"
-            f"           s.ptr + CASE WHEN s.w = -1 AND"
-            f" s.ptr <= 3 THEN 1\n"
-            f"             ELSE 0 END AS ptr,\n"
-            f"           coalesce(wx.tw, -1) AS w\n"
-            f"         FROM {p} s LEFT JOIN (\n"
-            f"           SELECT tw, min(pk) AS pk FROM (\n"
-            f"             SELECT v.w AS tw, q.r*4 + s2.m AS pk\n"
-            f"             FROM {p} s2\n"
-            f"             JOIN mpv v ON v.m = s2.m AND"
-            f" v.p = s2.ptr\n"
-            f"             JOIN wrk q ON q.w = v.w AND"
-            f" q.m = s2.m\n"
-            f"             WHERE s2.w = -1 AND s2.ptr <= 3\n"
-            f"             UNION ALL\n"
-            f"             SELECT s3.w, q2.r*4 + s3.m\n"
-            f"             FROM {p} s3\n"
-            f"             JOIN wrk q2 ON q2.w = s3.w AND"
-            f" q2.m = s3.m\n"
-            f"             WHERE s3.w >= 0) c GROUP BY tw)\n"
-            f"           wx ON wx.pk % 4 = s.m)")
-    parts += [
-        # certificates
-        "ns AS (SELECT CAST(count(*) AS BIGINT) AS n_stable"
-        " FROM stb)",
-        "fv AS (SELECT CAST(sum(CASE WHEN w = -1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS n_free FROM gs5)",
-        "gc AS (SELECT CAST(sum(a.w * (" + pw_m.replace(
-            "a.m", "a.m") + "))\n"
-        "           AS BIGINT) AS gs_code FROM gs5 a)",
-        "gi AS (SELECT CAST(count(*) AS BIGINT) AS gs_in_stable\n"
-        "         FROM gc g JOIN stb t ON t.code = g.gs_code)",
-        # man-optimality: each man's GS partner is his best over
-        # ALL stable matchings (the deferred-acceptance theorem)
-        "mo AS (SELECT CAST(sum(CASE WHEN gr.r <> bs.br THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS manopt_viol\n"
-        "         FROM gs5 s\n"
-        "         JOIN mrk gr ON gr.m = s.m AND gr.w = s.w\n"
-        "         JOIN (SELECT a.m, min(r1.r) AS br FROM asg a\n"
-        "           JOIN stb t ON t.code = a.code\n"
-        "           JOIN mrk r1 ON r1.m = a.m AND r1.w = a.w\n"
-        "           GROUP BY a.m) bs ON bs.m = s.m)",
-        # woman-pessimality: each woman gets her WORST stable man
-        "wpx AS (SELECT CAST(sum(CASE WHEN gw.r <> ws.wr2"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS wpess_viol\n"
-        "         FROM gs5 s\n"
-        "         JOIN wrk gw ON gw.w = s.w AND gw.m = s.m\n"
-        "         JOIN (SELECT a.w, max(r2.r) AS wr2 FROM asg a\n"
-        "           JOIN stb t ON t.code = a.code\n"
-        "           JOIN wrk r2 ON r2.w = a.w AND r2.m = a.m\n"
-        "           GROUP BY a.w) ws ON ws.w = s.w)",
-        # Conway's lattice: per-man-better (meet) and per-man-worse
-        # (join) of ANY two stable matchings is again a stable
-        # matching — checked over all 9 ordered pairs
-        "lat AS (SELECT CAST(sum(CASE WHEN g.ndm <> 4 OR"
-        " g.ndj <> 4\n"
-        "             OR tm.code IS NULL OR tj.code IS NULL"
-        " THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS lattice_viol\n"
-        "         FROM (SELECT ts.code AS cs, tt.code AS ct,\n"
-        "             count(DISTINCT CASE WHEN r1.r <= r2.r"
-        " THEN a.w\n"
-        "               ELSE a2.w END) AS ndm,\n"
-        "             count(DISTINCT CASE WHEN r1.r > r2.r"
-        " THEN a.w\n"
-        "               ELSE a2.w END) AS ndj,\n"
-        "             sum((CASE WHEN r1.r <= r2.r THEN a.w"
-        " ELSE a2.w END)\n"
-        "               * (" + pw_m.replace("a.m", "a.m") + "))"
-        " AS mcode,\n"
-        "             sum((CASE WHEN r1.r > r2.r THEN a.w"
-        " ELSE a2.w END)\n"
-        "               * (" + pw_m.replace("a.m", "a.m") + "))"
-        " AS jcode\n"
-        "           FROM stb ts JOIN stb tt ON 1 = 1\n"
-        "           JOIN asg a ON a.code = ts.code\n"
-        "           JOIN asg a2 ON a2.code = tt.code AND"
-        " a2.m = a.m\n"
-        "           JOIN mrk r1 ON r1.m = a.m AND r1.w = a.w\n"
-        "           JOIN mrk r2 ON r2.m = a.m AND r2.w = a2.w\n"
-        "           GROUP BY ts.code, tt.code) g\n"
-        "         LEFT JOIN stb tm ON tm.code = g.mcode\n"
-        "         LEFT JOIN stb tj ON tj.code = g.jcode)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT s.m, s.w, gr.r AS man_rank,\n"
-        "       n.n_stable, g.gs_code, i.gs_in_stable,\n"
-        "       o.manopt_viol, x.wpess_viol, t.lattice_viol,\n"
-        "       f.n_free, l.n_docs\n"
-        "FROM gs5 s JOIN mrk gr ON gr.m = s.m AND gr.w = s.w\n"
-        "CROSS JOIN ns n CROSS JOIN gc g CROSS JOIN gi i\n"
-        "CROSS JOIN mo o CROSS JOIN wpx x CROSS JOIN lat t\n"
-        "CROSS JOIN fv f CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q684_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q684_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q684_stable_matching",
-       "WITH " + _q684_join("documents", "//", " MATERIALIZED"))
-def q684(spark, sf_dir):
-    """Gale–Shapley stable matching with the full theorem suite
-    certified against total exhaustion (Gale & Shapley 1962;
-    the algorithm behind medical residency matching and the
-    2012 economics Nobel — and the canonical example of a
-    greedy whose output is EXTREMAL, not just feasible).  The
-    exhaustive machine sweeps all 24 perfect matchings of the
-    4x4 instance through the blocking-pair definition — a pair
-    (m, w) both preferring each other to their partners — and
-    finds exactly n_stable == 3 stable matchings.  The
-    algorithmic machine runs round-synchronous deferred
-    acceptance as five unrolled relational rounds (free men
-    propose down their lists, each woman keeps the best of
-    current-plus-proposers by a packed min(rank*4 + m), and
-    displaced men resume proposing): it converges (n_free == 0)
-    to gs_code 30 = (0,1,3,2), which is (a) stable
-    (gs_in_stable == 1), (b) MAN-OPTIMAL — every man's GS
-    partner is his best across all three stable matchings
-    (manopt_viol == 0, the deferred-acceptance theorem), and
-    (c) WOMAN-PESSIMAL — every woman gets her worst stable
-    partner (wpess_viol == 0, the opposition-of-interests
-    theorem).  Conway's lattice theorem rides the same
-    exhaustion: for all 9 ordered pairs of stable matchings,
-    the per-man-better meet AND per-man-worse join are each a
-    valid permutation and again stable (lattice_viol == 0) —
-    the stable set is a distributive lattice, verified pair by
-    pair.  Scale: the 24-matching universe and 5-round chain
-    are dims; the blocking-pair sweep is the
-    aggregate-then-filter shape that distributes."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q684_documents")
-    parts, fin = _q684_sql("q684_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q684_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("el", "mrk", "wrk", "mpv", "pm", "asg",
-                  "blk", "stb") or nm.startswith("gs"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q684_{nm}",
-                      max_rows=200)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q685: Penney's game — nontransitive coin sequences, Conway's
-# leading-number formula vs Bellman-certified exact chain values
-
-
-# Python-precomputed joint pattern automata for all 56 ordered
-# pairs of distinct 3-flip sequences, with each pair's exact win
-# probabilities (common denominator) from a Fraction-exact linear
-# solve; the SQL machines below re-certify every Bellman equation,
-# absorption reachability, and Conway's formula from scratch.
-_Q685_PAIRS = '(1, 0, 1, 1, 2, 7, 3, 0, 4), (2, 0, 2, 2, 5, 7, 1, 1, 5), (3, 0, 3, 2, 5, 7, 1, 0, 4), (4, 0, 4, 1, 8, 7, 0, 3, 4), (5, 0, 5, 5, 12, 7, 0, 0, 5), (6, 0, 6, 3, 10, 7, 0, 1, 4), (7, 0, 7, 7, 14, 7, 0, 0, 7), (8, 1, 0, 1, 2, 4, 0, 3, 7), (10, 1, 2, 2, 3, 4, 2, 1, 5), (11, 1, 3, 2, 3, 4, 2, 0, 4), (12, 1, 4, 1, 4, 4, 1, 3, 4), (13, 1, 5, 5, 8, 4, 1, 0, 5), (14, 1, 6, 3, 6, 4, 1, 1, 4), (15, 1, 7, 7, 10, 4, 1, 0, 7), (16, 2, 0, 3, 5, 5, 1, 1, 7), (17, 2, 1, 1, 3, 5, 1, 2, 4), (19, 2, 3, 1, 2, 5, 1, 0, 4), (20, 2, 4, 3, 6, 5, 2, 1, 4), (21, 2, 5, 3, 6, 5, 2, 2, 5), (22, 2, 6, 3, 8, 5, 0, 1, 4), (23, 2, 7, 7, 12, 5, 0, 0, 7), (24, 3, 0, 3, 5, 4, 0, 1, 7), (25, 3, 1, 1, 3, 4, 0, 2, 4), (26, 3, 2, 1, 2, 4, 0, 1, 5), (28, 3, 4, 3, 6, 4, 1, 1, 4), (29, 3, 5, 3, 6, 4, 1, 2, 5), (30, 3, 6, 3, 4, 4, 3, 1, 4), (31, 3, 7, 7, 8, 4, 3, 0, 7), (32, 4, 0, 7, 8, 4, 3, 0, 7), (33, 4, 1, 3, 4, 4, 3, 1, 4), (34, 4, 2, 3, 6, 4, 1, 2, 5), (35, 4, 3, 3, 6, 4, 1, 1, 4), (37, 4, 5, 1, 2, 4, 0, 1, 5), (38, 4, 6, 1, 3, 4, 0, 2, 4), (39, 4, 7, 3, 5, 4, 0, 1, 7), (40, 5, 0, 7, 12, 5, 0, 0, 7), (41, 5, 1, 3, 8, 5, 0, 1, 4), (42, 5, 2, 3, 6, 5, 2, 2, 5), (43, 5, 3, 3, 6, 5, 2, 1, 4), (44, 5, 4, 1, 2, 5, 1, 0, 4), (46, 5, 6, 1, 3, 5, 1, 2, 4), (47, 5, 7, 3, 5, 5, 1, 1, 7), (48, 6, 0, 7, 10, 4, 1, 0, 7), (49, 6, 1, 3, 6, 4, 1, 1, 4), (50, 6, 2, 5, 8, 4, 1, 0, 5), (51, 6, 3, 1, 4, 4, 1, 3, 4), (52, 6, 4, 2, 3, 4, 2, 0, 4), (53, 6, 5, 2, 3, 4, 2, 1, 5), (55, 6, 7, 1, 2, 4, 0, 3, 7), (56, 7, 0, 7, 14, 7, 0, 0, 7), (57, 7, 1, 3, 10, 7, 0, 1, 4), (58, 7, 2, 5, 12, 7, 0, 0, 5), (59, 7, 3, 1, 8, 7, 0, 3, 4), (60, 7, 4, 2, 5, 7, 1, 0, 4), (61, 7, 5, 2, 5, 7, 1, 1, 5), (62, 7, 6, 1, 2, 7, 3, 0, 4)'
-_Q685_STATES = '(1, 0, 1, 0, 1), (1, 1, 2, 0, 1), (1, 2, -1, -2, 1), (2, 0, 1, 0, 2), (2, 1, 2, 3, 2), (2, 2, -1, 3, 3), (2, 3, -2, 0, 1), (3, 0, 1, 0, 2), (3, 1, 2, 3, 2), (3, 2, -1, 3, 3), (3, 3, 1, -2, 1), (4, 0, 1, 2, 1), (4, 1, 3, 2, 2), (4, 2, 4, 2, 0), (4, 3, -1, 2, 4), (4, 4, -2, 2, 0), (5, 0, 1, 2, 5), (5, 1, 3, 2, 6), (5, 2, 4, 2, 4), (5, 3, -1, 2, 8), (5, 4, 3, -2, 4), (6, 0, 1, 2, 3), (6, 1, 3, 2, 4), (6, 2, 1, 4, 2), (6, 3, -1, 2, 6), (6, 4, -2, 4, 0), (7, 0, 1, 2, 7), (7, 1, 3, 2, 8), (7, 2, 1, 4, 6), (7, 3, -1, 2, 10), (7, 4, 1, -2, 4), (8, 0, 1, 0, 1), (8, 1, 2, 0, 1), (8, 2, -2, -1, 1), (10, 0, 1, 0, 2), (10, 1, 2, 3, 2), (10, 2, 2, -1, 3), (10, 3, -2, 0, 1), (11, 0, 1, 0, 2), (11, 1, 2, 3, 2), (11, 2, 2, -1, 3), (11, 3, 1, -2, 1), (12, 0, 1, 2, 1), (12, 1, 3, 2, 2), (12, 2, 4, 2, 0), (12, 3, 3, -1, 4), (12, 4, -2, 2, 0), (13, 0, 1, 2, 5), (13, 1, 3, 2, 6), (13, 2, 4, 2, 4), (13, 3, 3, -1, 8), (13, 4, 3, -2, 4), (14, 0, 1, 2, 3), (14, 1, 3, 2, 4), (14, 2, 1, 4, 2), (14, 3, 3, -1, 6), (14, 4, -2, 4, 0), (15, 0, 1, 2, 7), (15, 1, 3, 2, 8), (15, 2, 1, 4, 6), (15, 3, 3, -1, 10), (15, 4, 1, -2, 4), (16, 0, 1, 0, 3), (16, 1, 2, 3, 3), (16, 2, -2, 3, 2), (16, 3, -1, 0, 4), (17, 0, 1, 0, 1), (17, 1, 2, 3, 1), (17, 2, 2, -2, 0), (17, 3, -1, 0, 2), (19, 0, 1, 0, 1), (19, 1, 1, 2, 1), (19, 2, -1, -2, 1), (20, 0, 1, 2, 3), (20, 1, 1, 3, 4), (20, 2, 4, 2, 2), (20, 3, -1, 2, 4), (20, 4, -2, 3, 2), (21, 0, 1, 2, 3), (21, 1, 1, 3, 4), (21, 2, 4, 2, 2), (21, 3, -1, 2, 4), (21, 4, 1, -2, 2), (22, 0, 1, 2, 3), (22, 1, 1, 3, 4), (22, 2, 1, 4, 2), (22, 3, -1, 4, 4), (22, 4, -2, 4, 0), (23, 0, 1, 2, 7), (23, 1, 1, 3, 8), (23, 2, 1, 4, 6), (23, 3, -1, 4, 8), (23, 4, 1, -2, 4), (24, 0, 1, 0, 3), (24, 1, 2, 3, 3), (24, 2, -2, 3, 2), (24, 3, 1, -1, 4), (25, 0, 1, 0, 1), (25, 1, 2, 3, 1), (25, 2, 2, -2, 0), (25, 3, 1, -1, 2), (26, 0, 1, 0, 1), (26, 1, 1, 2, 1), (26, 2, -2, -1, 1), (28, 0, 1, 2, 3), (28, 1, 1, 3, 4), (28, 2, 4, 2, 2), (28, 3, 4, -1, 4), (28, 4, -2, 3, 2), (29, 0, 1, 2, 3), (29, 1, 1, 3, 4), (29, 2, 4, 2, 2), (29, 3, 4, -1, 4), (29, 4, 1, -2, 2), (30, 0, 1, 2, 3), (30, 1, 1, 3, 4), (30, 2, 1, 4, 2), (30, 3, 1, -1, 4), (30, 4, -2, 4, 0), (31, 0, 1, 2, 7), (31, 1, 1, 3, 8), (31, 2, 1, 4, 6), (31, 3, 1, -1, 8), (31, 4, 1, -2, 4), (32, 0, 1, 2, 7), (32, 1, 3, 2, 6), (32, 2, 4, 2, 8), (32, 3, -2, 2, 4), (32, 4, -1, 2, 8), (33, 0, 1, 2, 3), (33, 1, 3, 2, 2), (33, 2, 4, 2, 4), (33, 3, 3, -2, 0), (33, 4, -1, 2, 4), (34, 0, 1, 2, 3), (34, 1, 1, 3, 2), (34, 2, 4, 2, 4), (34, 3, -2, 2, 2), (34, 4, -1, 3, 4), (35, 0, 1, 2, 3), (35, 1, 1, 3, 2), (35, 2, 4, 2, 4), (35, 3, 4, -2, 2), (35, 4, -1, 3, 4), (37, 0, 0, 1, 1), (37, 1, 2, 1, 1), (37, 2, -1, -2, 1), (38, 0, 0, 1, 1), (38, 1, 2, 3, 1), (38, 2, -1, 1, 2), (38, 3, -2, 3, 0), (39, 0, 0, 1, 3), (39, 1, 2, 3, 3), (39, 2, -1, 1, 4), (39, 3, 2, -2, 2), (40, 0, 1, 2, 7), (40, 1, 3, 2, 6), (40, 2, 4, 2, 8), (40, 3, -2, 2, 4), (40, 4, 3, -1, 8), (41, 0, 1, 2, 3), (41, 1, 3, 2, 2), (41, 2, 4, 2, 4), (41, 3, 3, -2, 0), (41, 4, 3, -1, 4), (42, 0, 1, 2, 3), (42, 1, 1, 3, 2), (42, 2, 4, 2, 4), (42, 3, -2, 2, 2), (42, 4, 1, -1, 4), (43, 0, 1, 2, 3), (43, 1, 1, 3, 2), (43, 2, 4, 2, 4), (43, 3, 4, -2, 2), (43, 4, 1, -1, 4), (44, 0, 0, 1, 1), (44, 1, 2, 1, 1), (44, 2, -2, -1, 1), (46, 0, 0, 1, 1), (46, 1, 2, 3, 1), (46, 2, 0, -1, 2), (46, 3, -2, 3, 0), (47, 0, 0, 1, 3), (47, 1, 2, 3, 3), (47, 2, 0, -1, 4), (47, 3, 2, -2, 2), (48, 0, 1, 2, 7), (48, 1, 3, 2, 6), (48, 2, 1, 4, 8), (48, 3, -2, 2, 4), (48, 4, -1, 4, 10), (49, 0, 1, 2, 3), (49, 1, 3, 2, 2), (49, 2, 1, 4, 4), (49, 3, 3, -2, 0), (49, 4, -1, 4, 6), (50, 0, 1, 2, 5), (50, 1, 1, 3, 4), (50, 2, 1, 4, 6), (50, 3, -2, 4, 4), (50, 4, -1, 4, 8), (51, 0, 1, 2, 1), (51, 1, 1, 3, 0), (51, 2, 1, 4, 2), (51, 3, 1, -2, 0), (51, 4, -1, 4, 4), (52, 0, 0, 1, 2), (52, 1, 2, 3, 2), (52, 2, -2, 1, 1), (52, 3, -1, 3, 3), (53, 0, 0, 1, 2), (53, 1, 2, 3, 2), (53, 2, 0, -2, 1), (53, 3, -1, 3, 3), (55, 0, 0, 1, 1), (55, 1, 0, 2, 1), (55, 2, -1, -2, 1), (56, 0, 1, 2, 7), (56, 1, 3, 2, 6), (56, 2, 1, 4, 8), (56, 3, -2, 2, 4), (56, 4, 1, -1, 10), (57, 0, 1, 2, 3), (57, 1, 3, 2, 2), (57, 2, 1, 4, 4), (57, 3, 3, -2, 0), (57, 4, 1, -1, 6), (58, 0, 1, 2, 5), (58, 1, 1, 3, 4), (58, 2, 1, 4, 6), (58, 3, -2, 4, 4), (58, 4, 1, -1, 8), (59, 0, 1, 2, 1), (59, 1, 1, 3, 0), (59, 2, 1, 4, 2), (59, 3, 1, -2, 0), (59, 4, 1, -1, 4), (60, 0, 0, 1, 2), (60, 1, 2, 3, 2), (60, 2, -2, 1, 1), (60, 3, 2, -1, 3), (61, 0, 0, 1, 2), (61, 1, 2, 3, 2), (61, 2, 0, -2, 1), (61, 3, 2, -1, 3), (62, 0, 0, 1, 1), (62, 1, 0, 2, 1), (62, 2, -2, -1, 1)'
-
-
-def _q685_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"cd AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS c FROM {tbl})",
-        "pr AS (SELECT CAST(pid AS BIGINT) AS pid, CAST(ca AS"
-        " BIGINT) AS ca,\n"
-        "           CAST(cb AS BIGINT) AS cb, CAST(pn AS"
-        " BIGINT) AS pn,\n"
-        "           CAST(den AS BIGINT) AS den, CAST(laa AS"
-        " BIGINT) AS laa,\n"
-        "           CAST(lab AS BIGINT) AS lab, CAST(lba AS"
-        " BIGINT) AS lba,\n"
-        "           CAST(lbb AS BIGINT) AS lbb FROM (VALUES"
-        " {pairs})\n"
-        "           t(pid, ca, cb, pn, den, laa, lab, lba,"
-        " lbb))",
-        "st AS (SELECT CAST(pid AS BIGINT) AS pid, CAST(sid AS"
-        " BIGINT) AS sid,\n"
-        "           CAST(t0 AS BIGINT) AS t0, CAST(t1 AS"
-        " BIGINT) AS t1,\n"
-        "           CAST(num AS BIGINT) AS num FROM (VALUES"
-        " {states})\n"
-        "           t(pid, sid, t0, t1, num))",
-        # every Bellman equation 2 p(s) = p(s|0) + p(s|1), with
-        # absorbing values p(A) = 1, p(B) = 0, re-audited exactly
-        "bl AS (SELECT CAST(sum(CASE WHEN 2*s.num <>\n"
-        "             (CASE WHEN s.t0 = -1 THEN p.den WHEN"
-        " s.t0 = -2 THEN 0\n"
-        "               ELSE coalesce(a0.num, -999999) END) +\n"
-        "             (CASE WHEN s.t1 = -1 THEN p.den WHEN"
-        " s.t1 = -2 THEN 0\n"
-        "               ELSE coalesce(a1.num, -999999) END)"
-        " THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS bell_viol\n"
-        "         FROM st s JOIN pr p ON p.pid = s.pid\n"
-        "         LEFT JOIN st a0 ON a0.pid = s.pid AND"
-        " a0.sid = s.t0\n"
-        "         LEFT JOIN st a1 ON a1.pid = s.pid AND"
-        " a1.sid = s.t1)",
-        # the pair table's headline value is the start state's
-        "sv AS (SELECT CAST(sum(CASE WHEN s.num <> p.pn THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS start_viol\n"
-        "         FROM st s JOIN pr p ON p.pid = s.pid\n"
-        "         WHERE s.sid = 0)",
-        # absorption certain: every state reaches an absorbing
-        # transition within 3 steps (feeding A's three flips
-        # absorbs) — this is what makes the Bellman solution UNIQUE
-        "r0 AS{mat} (SELECT DISTINCT pid, sid FROM st\n"
-        "         WHERE t0 < 0 OR t1 < 0)",
-        "r1 AS{mat} (SELECT pid, sid FROM r0 UNION\n"
-        "         SELECT s.pid, s.sid FROM st s\n"
-        "         JOIN r0 r ON r.pid = s.pid AND (r.sid = s.t0"
-        " OR r.sid = s.t1))",
-        "r2 AS{mat} (SELECT pid, sid FROM r1 UNION\n"
-        "         SELECT s.pid, s.sid FROM st s\n"
-        "         JOIN r1 r ON r.pid = s.pid AND (r.sid = s.t0"
-        " OR r.sid = s.t1))",
-        "rv AS (SELECT CAST(sum(CASE WHEN r.sid IS NULL THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS reach_viol\n"
-        "         FROM st s LEFT JOIN r2 r ON r.pid = s.pid\n"
-        "           AND r.sid = s.sid)",
-        # Conway leading numbers computed RELATIONALLY from the
-        # sequence bits: L(X,Y) = sum 2^(k-1) [last k X = first k Y]
-        "co AS{mat} (SELECT x.c AS cx, y.c AS cy,\n"
-        "           CAST((CASE WHEN x.c % 2 = y.c {d} 4 THEN 1"
-        " ELSE 0 END)\n"
-        "           + 2*(CASE WHEN (x.c {d} 2) % 2 = y.c {d} 4"
-        " AND\n"
-        "             x.c % 2 = (y.c {d} 2) % 2 THEN 1 ELSE 0"
-        " END)\n"
-        "           + 4*(CASE WHEN x.c = y.c THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS l\n"
-        "         FROM cd x CROSS JOIN cd y)",
-        # the inlined correlations must equal the relational ones,
-        # and Conway's odds identity must hold against the chain
-        # values: (den-pn)*(LBB-LBA) == pn*(LAA-LAB)
-        "cv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN aa.l <> p.laa OR ab.l <>"
-        " p.lab\n"
-        "             OR ba.l <> p.lba OR bb.l <> p.lbb THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS corr_viol,\n"
-        "           CAST(sum(CASE WHEN (p.den - p.pn)*(bb.l -"
-        " ba.l) <>\n"
-        "             p.pn*(aa.l - ab.l) THEN 1 ELSE 0 END)\n"
-        "             AS BIGINT) AS conway_viol\n"
-        "         FROM pr p\n"
-        "         JOIN co aa ON aa.cx = p.ca AND aa.cy = p.ca\n"
-        "         JOIN co ab ON ab.cx = p.ca AND ab.cy = p.cb\n"
-        "         JOIN co ba ON ba.cx = p.cb AND ba.cy = p.ca\n"
-        "         JOIN co bb ON bb.cx = p.cb AND bb.cy = p.cb)",
-        # nontransitivity: no sequence beats all 7 others, yet
-        # every sequence has a >= 2/3 beater, and the classic
-        # second-to-last-flip rule (y', x, y) always supplies one
-        "dm AS (SELECT\n"
-        "           CAST(sum(CASE WHEN t.nbeat = 7 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS n_dominant,\n"
-        "           CAST(sum(CASE WHEN t.hasb = 0 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS beater_viol\n"
-        "         FROM (SELECT ca,\n"
-        "             sum(CASE WHEN 2*pn > den THEN 1 ELSE 0"
-        " END) AS nbeat,\n"
-        "             max(CASE WHEN 3*(den - pn) >= 2*den THEN 1"
-        " ELSE 0 END)\n"
-        "               AS hasb\n"
-        "           FROM pr GROUP BY ca) t)",
-        "br AS (SELECT CAST(sum(CASE WHEN 3*(p.den - p.pn) <\n"
-        "             2*p.den THEN 1 ELSE 0 END) AS BIGINT)\n"
-        "             AS brule_viol\n"
-        "         FROM pr p WHERE p.cb =\n"
-        "           (1 - (p.ca {d} 2) % 2)*4 + (p.ca {d} 4)*2\n"
-        "           + (p.ca {d} 2) % 2)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT p.ca, p.cb, p.pn, p.den,\n"
-        "       aa.l AS laa2, ab.l AS lab2, ba.l AS lba2,"
-        " bb.l AS lbb2,\n"
-        "       b.bell_viol, s.start_viol, r.reach_viol,\n"
-        "       c.corr_viol, c.conway_viol, d2.n_dominant,\n"
-        "       d2.beater_viol, w.brule_viol, l.n_docs\n"
-        "FROM pr p\n"
-        "JOIN co aa ON aa.cx = p.ca AND aa.cy = p.ca\n"
-        "JOIN co ab ON ab.cx = p.ca AND ab.cy = p.cb\n"
-        "JOIN co ba ON ba.cx = p.cb AND ba.cy = p.ca\n"
-        "JOIN co bb ON bb.cx = p.cb AND bb.cy = p.cb\n"
-        "CROSS JOIN bl b CROSS JOIN sv s CROSS JOIN rv r\n"
-        "CROSS JOIN cv c CROSS JOIN dm d2 CROSS JOIN br w\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q685_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q685_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{pairs}", _Q685_PAIRS)
-             .replace("{states}", _Q685_STATES))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q685_penney_game",
-       "WITH " + _q685_join("documents", "//", " MATERIALIZED"))
-def q685(spark, sf_dir):
-    """Penney's game — nontransitive coin-flip sequences with
-    Conway's leading-number formula certified against
-    Bellman-re-audited exact chain probabilities (Penney 1969,
-    Conway's algorithm via Gardner 1974; the sequential
-    counterpart of q683's dice: pairwise 'appears first' is not
-    an order either, and the reason naive A/B stopping rules
-    mislead).  For all 56 ordered pairs of distinct 3-flip
-    patterns, the joint pattern automaton (states = longest
-    suffix that is a prefix of either pattern) and the exact
-    win probabilities p = P(A's pattern appears first) are
-    Python-precomputed as integer numerators over a common
-    denominator and re-certified relationally: every Bellman
-    equation 2 p(s) = p(s|heads) + p(s|tails) holds exactly
-    with absorbing boundary p = 1/0 (bell_viol == 0 over all
-    248 transient states), the pair table's headline value is
-    the empty state's (start_viol == 0), and every state
-    reaches absorption within three steps (reach_viol == 0 —
-    absorption certainty is what makes the bounded Bellman
-    solution UNIQUE, so the certificate pins the value, not
-    just a solution).  Conway's magic formula is then verified
-    as a theorem about these values: leading numbers L(X,Y) =
-    sum 2^(k-1)[last-k of X = first-k of Y] compute
-    relationally from the bit codes (corr_viol == 0 vs the
-    inlined table) and the odds identity p_B (L_BB - L_BA) =
-    p_A (L_AA - L_AB) holds by exact cross-multiplication on
-    all 56 pairs (conway_viol == 0).  Nontransitivity is
-    structural: no sequence beats all seven others (n_dominant
-    == 0) yet EVERY sequence has a >= 2/3 beater (beater_viol
-    == 0), and the classic rule — prepend the flipped middle
-    symbol, (y',x,y) against (x,y,z) — always supplies one
-    (brule_viol == 0), peaking at 7/8 against HHH/TTT.  Scale:
-    dims plus grouped joins; the certificate is 248 integer
-    identities, free at any corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q685_documents")
-    parts, fin = _q685_sql("q685_documents", "div", "")
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{pairs}", _Q685_PAIRS)
-              .replace("{states}", _Q685_STATES))
-        kept.append(fr)
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q686: Hadamard's maximal determinant at n = 4 — total 2^16
-# exhaustion, with the bound, the census, and the iff
-
-
-_Q686_PERMS = '(0, 1, 2, 3, 1), (0, 1, 3, 2, -1), (0, 2, 1, 3, -1), (0, 2, 3, 1, 1), (0, 3, 1, 2, 1), (0, 3, 2, 1, -1), (1, 0, 2, 3, -1), (1, 0, 3, 2, 1), (1, 2, 0, 3, 1), (1, 2, 3, 0, -1), (1, 3, 0, 2, -1), (1, 3, 2, 0, 1), (2, 0, 1, 3, 1), (2, 0, 3, 1, -1), (2, 1, 0, 3, -1), (2, 1, 3, 0, 1), (2, 3, 0, 1, 1), (2, 3, 1, 0, -1), (3, 0, 1, 2, -1), (3, 0, 2, 1, 1), (3, 1, 0, 2, 1), (3, 1, 2, 0, -1), (3, 2, 0, 1, -1), (3, 2, 1, 0, 1)'
-
-
-def _q686_e(row: int, pcol: str, mcol: str, d: str) -> str:
-    """Sign-matrix entry e(row, sigma(row)) as a Column string:
-    1 - 2*bit(m, row*4 + sigma(row)), the power CASE-dispatched."""
-    base = 2 ** (4 * row)
-    cs = " ".join(f"WHEN {j} THEN {base * 2 ** j}"
-                  for j in range(4))
-    return (f"(1 - 2*(({mcol} {d} CASE {pcol} {cs} END) % 2))")
-
-
-def _q686_dot(mcol: str, i: int, k: int, d: str) -> str:
-    """Row-i x row-k dot product of the sign matrix packed in m."""
-    terms = []
-    for j in range(4):
-        a = 2 ** (i * 4 + j)
-        b = 2 ** (k * 4 + j)
-        terms.append(f"(1 - 2*(({mcol} {d} {a}) % 2))"
-                     f"*(1 - 2*(({mcol} {d} {b}) % 2))")
-    return " + ".join(terms)
-
-
-def _q686_sql(tbl: str, d: str, mat: str):
-    e0 = _q686_e(0, "p.p0", "g.m", "{d}")
-    e1 = _q686_e(1, "p.p1", "g.m", "{d}")
-    e2 = _q686_e(2, "p.p2", "g.m", "{d}")
-    e3 = _q686_e(3, "p.p3", "g.m", "{d}")
-    pairdots = " + ".join(
-        f"(CASE WHEN ({_q686_dot('o.m', i, k, '{d}')}) <> 0"
-        f" THEN 1 ELSE 0 END)"
-        for i in range(4) for k in range(i + 1, 4))
-    parts = [
-        f"b8 AS (SELECT DISTINCT CAST(doc_id % 256 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        "mm AS{mat} (SELECT hi.b*256 + lo.b AS m\n"
-        "         FROM b8 hi CROSS JOIN b8 lo)",
-        "pd AS (SELECT CAST(p0 AS BIGINT) AS p0, CAST(p1 AS"
-        " BIGINT) AS p1,\n"
-        "           CAST(p2 AS BIGINT) AS p2, CAST(p3 AS"
-        " BIGINT) AS p3,\n"
-        "           CAST(sg AS BIGINT) AS sg FROM (VALUES"
-        " {perms})\n"
-        "           t(p0, p1, p2, p3, sg))",
-        # Leibniz determinant: 24 signed products per matrix
-        "dt AS{mat} (SELECT g.m,\n"
-        "           CAST(sum(p.sg * " + e0 + "\n"
-        "             * " + e1 + "\n"
-        "             * " + e2 + "\n"
-        "             * " + e3 + ") AS BIGINT) AS det\n"
-        "         FROM mm g CROSS JOIN pd p GROUP BY g.m)",
-        # per-matrix orthogonality: all 6 off-diagonal row pairs
-        "og AS{mat} (SELECT o.m,\n"
-        "           CAST(" + pairdots + " AS BIGINT) AS northo\n"
-        "         FROM mm o)",
-        "hs AS (SELECT abs(det) AS adet, CAST(count(*) AS"
-        " BIGINT) AS n\n"
-        "         FROM dt GROUP BY abs(det))",
-        "dv AS (SELECT CAST(sum(CASE WHEN det % 8 <> 0 THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS div_viol FROM dt)",
-        "mx AS (SELECT CAST(max(abs(det)) AS BIGINT) AS maxdet,\n"
-        "           CAST(sum(CASE WHEN abs(det) = 16 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS n_attain FROM dt)",
-        # |det| = 16  <=>  H H^T = 4 I, checked both ways on all
-        # 65536 matrices
-        "ff AS (SELECT CAST(sum(CASE WHEN (o.northo = 0) <>\n"
-        "             (abs(t.det) = 16) THEN 1 ELSE 0 END)\n"
-        "             AS BIGINT) AS iff_viol,\n"
-        "           CAST(sum(CASE WHEN o.northo = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS n_hadamard\n"
-        "         FROM og o JOIN dt t ON t.m = o.m)",
-        # the Sylvester tensor-square H2 (x) H2 lands in the census
-        "sy AS (SELECT CAST(max(abs(det)) AS BIGINT) AS"
-        " sylv_adet\n"
-        "         FROM dt WHERE m = 27808)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT h.adet, h.n, x.maxdet, x.n_attain,\n"
-        "       v.div_viol, f.iff_viol, f.n_hadamard,\n"
-        "       s.sylv_adet, l.n_docs\n"
-        "FROM hs h CROSS JOIN mx x CROSS JOIN dv v\n"
-        "CROSS JOIN ff f CROSS JOIN sy s CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q686_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q686_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{perms}", _Q686_PERMS))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q686_hadamard_maxdet",
-       "WITH " + _q686_join("documents", "//", " MATERIALIZED"))
-def q686(spark, sf_dir):
-    """Hadamard's maximal-determinant problem at n = 4, solved
-    by total exhaustion (Hadamard 1893: an n x n +-1 matrix has
-    |det| <= n^(n/2), with equality iff the rows are pairwise
-    orthogonal — the object underneath q619's sorting networks'
-    cousin designs, error-correcting codes, and D-optimal
-    experiment design).  All 65536 sign matrices materialize
-    from two 256-value corpus dims; each determinant computes
-    EXACTLY by the 24-term signed Leibniz sum (q645's machinery
-    at n = 4, entries unpacked from the 16-bit code by
-    power-CASE dispatch).  The complete spectrum lands as the
-    emitted histogram |det| in {0, 8, 16} with counts
-    43264/21504/768 — every determinant divisible by 2^(n-1)
-    = 8 (div_viol == 0, the parity-subtraction theorem), the
-    maximum EXACTLY the Hadamard bound 4^(4/2) = 16 (maxdet ==
-    16), attained by n_attain == 768 matrices.  The equality
-    characterization is verified as a genuine iff on the whole
-    universe: a matrix attains |det| = 16 precisely when all
-    six off-diagonal row dot products vanish (iff_viol == 0,
-    n_hadamard == 768 == n_attain — every extremal matrix is
-    Hadamard and every Hadamard matrix is extremal), and the
-    Sylvester construction H2 (x) H2 (code 27808, entry sign =
-    parity of popcount(i AND j)) sits in the census at
-    sylv_adet == 16.  Scale: the 65536 x 24 Leibniz join and
-    the 6-pair orthogonality scan are one aggregate each —
-    exhaustion as a grouped join, the shape that distributes."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q686_documents")
-    parts, fin = _q686_sql("q686_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q686_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{perms}", _Q686_PERMS))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("b8", "mm", "pd", "dt", "og"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            # JVM checkpoints: mm/og are ~65k rows — the former
-            # pandas pins paid the driver roundtrip twice each
-            _ckpt_view(spark,
-                       "SELECT /*+ REPARTITION(8) */ * FROM "
-                       + body[:-1] + ") q",
-                       f"q686_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q687: the Fano plane — incidence axioms, and PSL(3,2)'s order
-# 168 counted by total 5040-permutation sweep with group axioms
-
-
-# PG(2,2) from the perfect difference set {0,1,3} mod 7
-_Q687_LN = '(0, 0), (0, 1), (0, 3), (1, 1), (1, 2), (1, 4), (2, 2), (2, 3), (2, 5), (3, 3), (3, 4), (3, 6), (4, 0), (4, 4), (4, 5), (5, 1), (5, 5), (5, 6), (6, 0), (6, 2), (6, 6)'
-_Q687_LM = '(0, 11), (1, 22), (2, 44), (3, 88), (4, 49), (5, 98), (6, 69)'
-_Q687_P2 = "CASE {c} WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 ELSE 64 END"
-_Q687_P8 = "CASE {c} WHEN 0 THEN 1 WHEN 1 THEN 8 WHEN 2 THEN 64 WHEN 3 THEN 512 WHEN 4 THEN 4096 WHEN 5 THEN 32768 ELSE 262144 END"
-
-
-def _q687_sql(tbl: str, d: str, mat: str):
-    p2u = _Q687_P2.format(c="u.px")
-    p8x = _Q687_P8.format(c="u.x")
-    p8px = _Q687_P8.format(c="u.px")
-    perm_chain = "FROM pt a0"
-    for i in range(1, 7):
-        conds = " AND ".join(f"a{i}.e <> a{j}.e" for j in range(i))
-        perm_chain += f"\n         JOIN pt a{i} ON {conds}"
-    code = " + ".join(f"a{i}.e*{8 ** i}" for i in range(7))
-    parts = [
-        f"pt AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS e FROM {tbl})",
-        "ln AS (SELECT CAST(lid AS BIGINT) AS lid, CAST(p AS"
-        " BIGINT) AS p\n"
-        "         FROM (VALUES {ln}) t(lid, p))",
-        "lm AS (SELECT CAST(lid AS BIGINT) AS lid, CAST(mk AS"
-        " BIGINT) AS mk\n"
-        "         FROM (VALUES {lm}) t(lid, mk))",
-        # incidence axioms: every point pair on exactly one line,
-        # every line pair meets in exactly one point, 3-regular
-        "pv AS (SELECT CAST(sum(CASE WHEN c.n <> 1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS pair_viol FROM (\n"
-        "           SELECT x.e, y.e AS e2, (SELECT count(*)\n"
-        "             FROM ln l1 JOIN ln l2 ON l2.lid = l1.lid\n"
-        "             WHERE l1.p = x.e AND l2.p = y.e) AS n\n"
-        "           FROM pt x JOIN pt y ON y.e > x.e) c)",
-        "mv AS (SELECT CAST(sum(CASE WHEN c.n <> 1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS meet_viol FROM (\n"
-        "           SELECT l1.lid, l2.lid AS lid2,"
-        " count(*) AS n\n"
-        "           FROM ln l1 JOIN ln l2 ON l2.p = l1.p\n"
-        "             AND l2.lid > l1.lid\n"
-        "           GROUP BY l1.lid, l2.lid) c)",
-        "rv AS (SELECT CAST(\n"
-        "           (SELECT sum(CASE WHEN a.n <> 3 THEN 1"
-        " ELSE 0 END)\n"
-        "             FROM (SELECT lid, count(*) AS n FROM ln\n"
-        "               GROUP BY lid) a)\n"
-        "           + (SELECT sum(CASE WHEN b.n <> 3 THEN 1"
-        " ELSE 0 END)\n"
-        "             FROM (SELECT p, count(*) AS n FROM ln\n"
-        "               GROUP BY p) b) AS BIGINT) AS reg_viol)",
-        # all 5040 permutations of the 7 points, packed base 8
-        "pm AS{mat} (SELECT " + code + " AS code,\n"
-        "           a0.e AS q0, a1.e AS q1\n"
-        "         " + perm_chain + ")",
-        "up AS{mat} (" + "\n         UNION ALL ".join(
-            f"SELECT code, CAST({i} AS BIGINT) AS x,"
-            f" (code {{d}} {8 ** i}) % 8 AS px FROM pm"
-            for i in range(7)) + ")",
-        # image mask of each line under each permutation
-        "im AS{mat} (SELECT u.code, l.lid,\n"
-        "           CAST(sum(" + p2u + ") AS BIGINT) AS imask\n"
-        "         FROM up u JOIN ln l ON l.p = u.x\n"
-        "         GROUP BY u.code, l.lid)",
-        # automorphisms: all 7 line images are again lines
-        "au AS{mat} (SELECT i.code FROM im i\n"
-        "         JOIN lm m ON m.mk = i.imask\n"
-        "         GROUP BY i.code HAVING count(*) = 7)",
-        "na AS (SELECT CAST(count(*) AS BIGINT) AS n_aut"
-        " FROM au)",
-        "idv AS (SELECT CAST(count(*) AS BIGINT) AS id_in_aut\n"
-        "         FROM au WHERE code = {ident})",
-        # closure: all 168 x 168 compositions land back in Aut
-        "cl AS (SELECT CAST(sum(CASE WHEN a3.code IS NULL"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS closure_viol"
-        " FROM (\n"
-        "           SELECT u1.code AS c1, u2.code AS c2,\n"
-        "             sum(u2.px * (" + _Q687_P8.format(
-            c="u1.x") + ")) AS cc\n"
-        "           FROM au g1 JOIN up u1 ON u1.code = g1.code\n"
-        "           JOIN au g2 ON 1 = 1\n"
-        "           JOIN up u2 ON u2.code = g2.code AND"
-        " u2.x = u1.px\n"
-        "           GROUP BY u1.code, u2.code) t\n"
-        "         LEFT JOIN au a3 ON a3.code = t.cc)",
-        # inverses: the transpose repack of each aut is an aut
-        "iv AS (SELECT CAST(sum(CASE WHEN a3.code IS NULL"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS inv_viol FROM (\n"
-        "           SELECT u.code, sum(u.x * (" + p8px + "))"
-        " AS ic\n"
-        "           FROM au g JOIN up u ON u.code = g.code\n"
-        "           GROUP BY u.code) t\n"
-        "         LEFT JOIN au a3 ON a3.code = t.ic)",
-        # transitivity: on points, ordered pairs, and flags
-        "tr AS (SELECT\n"
-        "           CAST(count(DISTINCT p.q0) AS BIGINT)"
-        " AS n_orbit_pts,\n"
-        "           CAST(count(DISTINCT p.q0*8 + p.q1) AS"
-        " BIGINT)\n"
-        "             AS n_orbit_pairs\n"
-        "         FROM au g JOIN pm p ON p.code = g.code)",
-        "fl AS (SELECT CAST(count(DISTINCT p.q0*512 + i.imask)\n"
-        "           AS BIGINT) AS n_orbit_flags\n"
-        "         FROM au g JOIN pm p ON p.code = g.code\n"
-        "         JOIN im i ON i.code = g.code AND i.lid = 0)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT m.lid, m.mk, v1.pair_viol, v2.meet_viol,\n"
-        "       v3.reg_viol, n.n_aut, i.id_in_aut,\n"
-        "       c.closure_viol, w.inv_viol, t.n_orbit_pts,\n"
-        "       t.n_orbit_pairs, f.n_orbit_flags, l.n_docs\n"
-        "FROM lm m CROSS JOIN pv v1 CROSS JOIN mv v2\n"
-        "CROSS JOIN rv v3 CROSS JOIN na n CROSS JOIN idv i\n"
-        "CROSS JOIN cl c CROSS JOIN iv w CROSS JOIN tr t\n"
-        "CROSS JOIN fl f CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q687_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q687_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{ln}", _Q687_LN).replace("{lm}", _Q687_LM)
-             .replace("{ident}", "1754760"))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q687_fano_plane",
-       "WITH " + _q687_join("documents", "//", " MATERIALIZED"))
-def q687(spark, sf_dir):
-    """The Fano plane PG(2,2) with its automorphism group
-    PSL(3,2) of order 168 COUNTED, not cited, by sweeping all
-    5040 point permutations (Fano 1892; the smallest projective
-    plane, the incidence geometry underneath q612's Hamming
-    code — its lines are exactly the weight-3 codewords — and
-    168 is the order of the second-smallest nonabelian simple
-    group).  The seven lines come from the perfect difference
-    set {0,1,3} mod 7; the incidence AXIOMS are verified
-    exhaustively — every one of the 21 point pairs lies on
-    exactly one line (pair_viol == 0), every line pair meets in
-    exactly one point (meet_viol == 0, self-duality), and the
-    geometry is 3-regular both ways (reg_viol == 0).  All 5040
-    permutations materialize by a 7-way distinct join, packed
-    base 8; a permutation is an automorphism iff all seven line
-    images (bitmask of mapped points) are again lines — exactly
-    n_aut == 168 survive.  That the survivors form a GROUP is
-    then certified, not assumed: the identity is among them
-    (id_in_aut == 1), all 168 x 168 = 28224 relational
-    compositions land back in the set (closure_viol == 0,
-    q629's group-action machinery), and every inverse — the
-    transpose repack sum(x * 8^p(x)) — is a member (inv_viol ==
-    0).  The action is transitive on points (n_orbit_pts == 7),
-    2-transitive on ordered pairs (n_orbit_pairs == 42), and
-    transitive on flags (n_orbit_flags == 21) — with
-    |Aut| = 168 = 8 * 21 the flag count times the flag
-    stabilizer, orbit-stabilizer visible in the emitted
-    numbers.  Scale: the 5040-permutation sweep is one grouped
-    join over 35280 unpivoted rows; composition closure is a
-    self-join of a 168-row dim — certificate cost independent
-    of corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q687_documents")
-    parts, fin = _q687_sql("q687_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q687_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{ln}", _Q687_LN).replace("{lm}", _Q687_LM)
-              .replace("{ident}", "1754760"))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("pt", "ln", "lm", "pm", "up", "im", "au"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q687_{nm}",
-                      max_rows=40000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q688: number-theoretic transform mod 257 — the convolution
-# theorem, inversion, and character orthogonality, all exact
-
-
-_Q688_PW = '(0, 1), (1, 249), (2, 64), (3, 2), (4, 241), (5, 128), (6, 4), (7, 225), (8, 256), (9, 8), (10, 193), (11, 255), (12, 16), (13, 129), (14, 253), (15, 32)'
-
-
-def _q688_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"k16 AS (SELECT DISTINCT CAST(doc_id % 16 AS BIGINT)"
-        f" AS k FROM {tbl})",
-        "pw AS (SELECT CAST(k AS BIGINT) AS k, CAST(v AS"
-        " BIGINT) AS v\n"
-        "         FROM (VALUES {pw}) t(k, v))",
-        # the inlined power table is re-certified: pw(0) = 1 and
-        # pw(k+1) = 249 pw(k) mod 257 cyclically (closing the loop
-        # back to 1 IS omega^16 = 1), with no earlier return to 1
-        "rc AS (SELECT CAST(sum(CASE WHEN n.v <> (c.v*249) %"
-        " 257\n"
-        "             THEN 1 ELSE 0 END)\n"
-        "           + sum(CASE WHEN c.k >= 1 AND c.v = 1 THEN 1\n"
-        "             ELSE 0 END)\n"
-        "           + sum(CASE WHEN c.k = 0 AND c.v <> 1 THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS root_viol\n"
-        "         FROM pw c JOIN pw n ON n.k = (c.k + 1) % 16)",
-        # character orthogonality: sum_k omega^(jk) = 16 [j = 0]
-        "ox AS (SELECT CAST(sum(CASE WHEN t.s <> CASE WHEN"
-        " t.j = 0\n"
-        "             THEN 16 ELSE 0 END THEN 1 ELSE 0 END)\n"
-        "           AS BIGINT) AS orth_viol FROM (\n"
-        "           SELECT j.k AS j, sum(w.v) % 257 AS s\n"
-        "           FROM k16 j CROSS JOIN k16 x\n"
-        "           JOIN pw w ON w.k = (j.k * x.k) % 16\n"
-        "           GROUP BY j.k) t)",
-        # two corpus-derived length-16 sequences mod 257
-        f"sa AS{{mat}} (SELECT doc_id % 16 AS k,\n"
-        f"           CAST(sum(n_chars) % 257 AS BIGINT) AS v\n"
-        f"         FROM {tbl} GROUP BY doc_id % 16)",
-        f"sb AS{{mat}} (SELECT doc_id % 16 AS k,\n"
-        f"           CAST(sum(n_chars * (doc_id % 97 + 1)) %"
-        f" 257\n"
-        f"             AS BIGINT) AS v\n"
-        f"         FROM {tbl} GROUP BY doc_id % 16)",
-        # forward transforms
-        "fa AS{mat} (SELECT j.k AS j, CAST(sum(a.v * w.v) % 257"
-        " AS BIGINT)\n"
-        "           AS v FROM k16 j CROSS JOIN sa a\n"
-        "         JOIN pw w ON w.k = (j.k * a.k) % 16"
-        " GROUP BY j.k)",
-        "fb AS{mat} (SELECT j.k AS j, CAST(sum(b.v * w.v) % 257"
-        " AS BIGINT)\n"
-        "           AS v FROM k16 j CROSS JOIN sb b\n"
-        "         JOIN pw w ON w.k = (j.k * b.k) % 16"
-        " GROUP BY j.k)",
-        # direct cyclic convolution
-        "cc AS{mat} (SELECT i.k AS i,\n"
-        "           CAST(sum(a.v * b.v) % 257 AS BIGINT) AS v\n"
-        "         FROM k16 i CROSS JOIN sa a\n"
-        "         JOIN sb b ON b.k = (i.k - a.k + 16) % 16\n"
-        "         GROUP BY i.k)",
-        # convolution theorem: DFT(c) = A . B pointwise
-        "cv AS (SELECT CAST(sum(CASE WHEN t.v <> (a.v * b.v) %"
-        " 257\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS conv_viol\n"
-        "         FROM (SELECT j.k AS j, sum(c.v * w.v) % 257"
-        " AS v\n"
-        "           FROM k16 j CROSS JOIN cc c\n"
-        "           JOIN pw w ON w.k = (j.k * c.i) % 16\n"
-        "           GROUP BY j.k) t\n"
-        "         JOIN fa a ON a.j = t.j JOIN fb b ON"
-        " b.j = t.j)",
-        # inversion: 16^-1 sum_j A(j)B(j) omega^(-ij) recovers c
-        "iv AS{mat} (SELECT i.k AS i,\n"
-        "           CAST((241 * (sum(a.v * b.v % 257 * w.v) %"
-        " 257)) % 257\n"
-        "             AS BIGINT) AS v\n"
-        "         FROM k16 i CROSS JOIN fa a\n"
-        "         JOIN fb b ON b.j = a.j\n"
-        "         JOIN pw w ON w.k = (16 - (i.k * a.j) % 16) %"
-        " 16\n"
-        "         GROUP BY i.k)",
-        "rv AS (SELECT CAST(sum(CASE WHEN i2.v <> c.v THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS inv_viol\n"
-        "         FROM iv i2 JOIN cc c ON c.i = i2.i)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT c.i, a.v AS a_v, b.v AS b_v, c.v AS conv_v,\n"
-        "       i2.v AS inv_v, fa2.v AS ft_a, fb2.v AS ft_b,\n"
-        "       r.root_viol, o.orth_viol, x.conv_viol,\n"
-        "       w.inv_viol, l.n_docs\n"
-        "FROM cc c JOIN sa a ON a.k = c.i\n"
-        "JOIN sb b ON b.k = c.i\n"
-        "JOIN iv i2 ON i2.i = c.i\n"
-        "JOIN fa fa2 ON fa2.j = c.i JOIN fb fb2 ON fb2.j = c.i\n"
-        "CROSS JOIN rc r CROSS JOIN ox o CROSS JOIN cv x\n"
-        "CROSS JOIN rv w CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q688_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q688_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{pw}", _Q688_PW))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q688_ntt_convolution",
-       "WITH " + _q688_join("documents", "//", " MATERIALIZED"))
-def q688(spark, sf_dir):
-    """The number-theoretic transform mod 257 — the FFT's exact
-    integer twin, with the convolution theorem, the inversion
-    formula, and character orthogonality all certified on
-    corpus data (Pollard 1971; the transform under every big
-    integer multiply and lattice-crypto polynomial ring, and
-    the reason 'FFT needs floats' is false — over the Fermat
-    prime 257, omega = 3^16 = 249 generates an exact order-16
-    root of unity).  The inlined power table is re-certified
-    relationally (pw(k+1) = 249 pw(k) mod 257 closing
-    cyclically to 1 with no earlier return — root_viol == 0:
-    omega has order EXACTLY 16), and the inversion lemma's
-    engine is verified wholesale: sum_k omega^(jk) is 16 at
-    j = 0 and 0 at every other j (orth_viol == 0).  Two
-    length-16 sequences derive from the corpus (per-residue
-    n_chars sums mod 257, so the data moves with SF); their
-    DFTs compute as one grouped join each, and BOTH core
-    theorems land as exact identities: DFT(a *cyclic* b) =
-    DFT(a) . DFT(b) pointwise (conv_viol == 0, the convolution
-    theorem verified coefficient by coefficient against the
-    directly-computed cyclic convolution), and the inverse
-    transform 16^-1 sum_j A(j)B(j) omega^(-ij) (with 16^-1 =
-    241 mod 257) reproduces that convolution exactly
-    (inv_viol == 0 — Fourier inversion as integer arithmetic).
-    Every value is exact BIGINT mod 257: no floats anywhere in
-    a Fourier analysis.  Scale: transforms are grouped joins
-    over a 16-element dim; the corpus aggregation is the only
-    data-sized stage — map-side combinable, the shape that
-    distributes."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q688_documents")
-    parts, fin = _q688_sql("q688_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q688_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{pw}", _Q688_PW))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("k16", "pw", "sa", "sb", "fa", "fb", "cc",
-                  "iv"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q688_{nm}",
-                      max_rows=64)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q689: LFSR m-sequences — the primitive-polynomial census by
-# orbit exhaustion, and Golomb's three randomness postulates
-
-
-# the chosen m-sequence: states of the x^5 + x^2 + 1 Fibonacci
-# LFSR from seed 1 (tap config t = 2), re-certified step-by-step
-# against the relational transition function below
-_Q689_SQ = '(0, 1), (1, 16), (2, 8), (3, 4), (4, 18), (5, 9), (6, 20), (7, 26), (8, 13), (9, 6), (10, 19), (11, 25), (12, 28), (13, 30), (14, 31), (15, 15), (16, 7), (17, 3), (18, 17), (19, 24), (20, 12), (21, 22), (22, 27), (23, 29), (24, 14), (25, 23), (26, 11), (27, 21), (28, 10), (29, 5), (30, 2)'
-# Golomb run-distribution theorem for n = 5: 2^(3-k) runs of each
-# symbol at lengths k = 1..3, one 0-run of length 4, one 1-run of 5
-_Q689_REX = '(0, 1, 4), (1, 1, 4), (0, 2, 2), (1, 2, 2), (0, 3, 1), (1, 3, 1), (0, 4, 1), (1, 5, 1)'
-
-
-def _q689_sql(tbl: str, d: str, mat: str):
-    parity = "((s.s {d} 1) % 2) * (((2*t.t + 1) {d} 1) % 2) + ((s.s {d} 2) % 2) * (((2*t.t + 1) {d} 2) % 2) + ((s.s {d} 4) % 2) * (((2*t.t + 1) {d} 4) % 2) + ((s.s {d} 8) % 2) * (((2*t.t + 1) {d} 8) % 2) + ((s.s {d} 16) % 2) * (((2*t.t + 1) {d} 16) % 2)"
-    parts = [
-        f"t16 AS (SELECT DISTINCT CAST(doc_id % 16 AS BIGINT)"
-        f" AS t FROM {tbl})",
-        f"s31 AS (SELECT DISTINCT CAST(doc_id % 31 + 1 AS"
-        f" BIGINT) AS s FROM {tbl})",
-        # the transition function of every degree-5 LFSR with
-        # nonzero constant term: t encodes taps c1..c4, c0 = 1
-        "tr AS{mat} (SELECT t.t, s.s,\n"
-        "           CAST((s.s {d} 2) + ((" + parity + ") % 2)*16\n"
-        "             AS BIGINT) AS nx\n"
-        "         FROM t16 t CROSS JOIN s31 s)",
-        # orbit of seed 1 by pointer doubling (paths up to 32)
-        "r1 AS{mat} (SELECT t, s AS a, nx AS b FROM tr)",
-    ]
-    for k in range(2, 7):
-        parts.append(
-            f"r{k} AS{{mat}} (SELECT t, a, b FROM r{k - 1}"
-            f" UNION\n"
-            f"         SELECT x.t, x.a, y.b FROM r{k - 1} x\n"
-            f"         JOIN r{k - 1} y ON y.t = x.t AND"
-            f" y.a = x.b)",
-    )
-    parts += [
-        "orb AS{mat} (SELECT t, CAST(count(DISTINCT b) AS"
-        " BIGINT) AS osz\n"
-        "         FROM r6 WHERE a = 1 GROUP BY t)",
-        # exactly phi(31)/5 = 6 of the 16 polynomials are
-        # primitive (full 31-state orbit)
-        "np AS (SELECT CAST(sum(CASE WHEN osz = 31 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS n_primitive FROM orb)",
-        "pc AS (SELECT CAST(max(osz) AS BIGINT) AS"
-        " chosen_period\n"
-        "         FROM orb WHERE t = 2)",
-        "sq AS (SELECT CAST(i AS BIGINT) AS i, CAST(s AS"
-        " BIGINT) AS s\n"
-        "         FROM (VALUES {sq}) t(i, s))",
-        # the inlined walk is re-certified against the engine's
-        # own transition relation, step by step, cyclically
-        "wv AS (SELECT CAST(sum(CASE WHEN f.nx <> n.s THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS walk_viol\n"
-        "         FROM sq c JOIN sq n ON n.i = (c.i + 1) % 31\n"
-        "         JOIN tr f ON f.t = 2 AND f.s = c.s)",
-        # Golomb R1: balance (one extra 1)
-        "bal AS (SELECT CAST(sum(s % 2) AS BIGINT) AS n_ones"
-        " FROM sq)",
-        # Golomb R2: cyclic run-length census == the theorem's
-        "stx AS{mat} (SELECT c.i, c.s % 2 AS bit FROM sq c\n"
-        "         JOIN sq p ON p.i = (c.i + 30) % 31\n"
-        "         WHERE c.s % 2 <> p.s % 2)",
-        "rc AS{mat} (SELECT t.bit, t.ln, CAST(count(*) AS"
-        " BIGINT) AS cnt\n"
-        "         FROM (SELECT c.i, c.bit,\n"
-        "             min((o.i - c.i + 31) % 31) AS ln\n"
-        "           FROM stx c JOIN stx o ON o.i <> c.i\n"
-        "           GROUP BY c.i, c.bit) t\n"
-        "         GROUP BY t.bit, t.ln)",
-        "rex AS (SELECT CAST(bit AS BIGINT) AS bit, CAST(ln AS"
-        " BIGINT) AS ln,\n"
-        "           CAST(cnt AS BIGINT) AS cnt FROM (VALUES"
-        " {rex})\n"
-        "           t(bit, ln, cnt))",
-        "rvx AS (SELECT CAST(\n"
-        "           (SELECT count(*) FROM rc c LEFT JOIN rex x\n"
-        "             ON x.bit = c.bit AND x.ln = c.ln\n"
-        "             WHERE x.cnt IS NULL OR x.cnt <> c.cnt)\n"
-        "           + (SELECT count(*) FROM rex x LEFT JOIN rc"
-        " c\n"
-        "             ON c.bit = x.bit AND c.ln = x.ln\n"
-        "             WHERE c.cnt IS NULL) AS BIGINT)"
-        " AS runs_viol)",
-        # Golomb R3: two-level autocorrelation — every nonzero
-        # shift agrees at exactly 15 of 31 positions
-        "ac AS (SELECT CAST(sum(CASE WHEN t.ag <> 15 THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS ac_viol FROM (\n"
-        "           SELECT h.s AS tau, sum(CASE WHEN s1.s % 2 =\n"
-        "             s2.s % 2 THEN 1 ELSE 0 END) AS ag\n"
-        "           FROM s31 h CROSS JOIN sq s1\n"
-        "           JOIN sq s2 ON s2.i = (s1.i + h.s) % 31\n"
-        "           WHERE h.s <= 30 GROUP BY h.s) t)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT q.i, q.s, q.s % 2 AS bit, n.n_primitive,\n"
-        "       p.chosen_period, w.walk_viol, b.n_ones,\n"
-        "       r.runs_viol, a.ac_viol, l.n_docs\n"
-        "FROM sq q CROSS JOIN np n CROSS JOIN pc p\n"
-        "CROSS JOIN wv w CROSS JOIN bal b CROSS JOIN rvx r\n"
-        "CROSS JOIN ac a CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q689_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q689_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{sq}", _Q689_SQ).replace("{rex}",
-                                                _Q689_REX))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q689_lfsr_golomb",
-       "WITH " + _q689_join("documents", "//", " MATERIALIZED"))
-def q689(spark, sf_dir):
-    """LFSR m-sequences — the degree-5 primitive-polynomial
-    census by total orbit exhaustion, and Golomb's three
-    randomness postulates verified on the sequence itself
-    (Golomb 1967; the shift registers under CRC scramblers,
-    GPS C/A codes, and stream ciphers, with 'looks random' made
-    into three checkable theorems).  All 16 degree-5 feedback
-    polynomials with nonzero constant term materialize as tap
-    configs; each one's full transition function on the 31
-    nonzero states is a pure column expression (feedback =
-    tap-masked parity), and the orbit of seed 1 computes by
-    five pointer-doubling rounds — EXACTLY n_primitive == 6
-    configs reach the full 31-state cycle, which is Euler's
-    phi(31)/5 = 30/5 counted, not cited.  The chosen primitive
-    x^5 + x^2 + 1 (chosen_period == 31) has its inlined state
-    walk re-certified against the engine's own transition
-    relation step by step, cyclically (walk_viol == 0), and the
-    output bit sequence then passes all three Golomb postulates
-    as exact counts: R1 balance — 16 ones vs 15 zeros (n_ones
-    == 16); R2 runs — the cyclic run-length census equals the
-    theorem's distribution exactly, 4+4 runs of length 1, 2+2
-    of length 2, 1+1 of length 3, one 0-run of length 4, one
-    1-run of length 5 (runs_viol == 0 against the inlined
-    expected dim, both containments); R3 two-level
-    autocorrelation — EVERY one of the 30 nonzero cyclic shifts
-    agrees at exactly 15 of 31 positions (ac_viol == 0), the
-    -1/31 sidelobe that makes m-sequences usable as spreading
-    codes.  Scale: a 496-row transition dim, log-depth
-    doubling, and grouped self-joins — certificate cost fixed,
-    corpus-independent."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q689_documents")
-    parts, fin = _q689_sql("q689_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q689_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{sq}", _Q689_SQ).replace("{rex}",
-                                                 _Q689_REX))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("t16", "s31", "tr", "orb", "sq", "stx",
-                  "rc") or \
-                (nm.startswith("r") and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q689_{nm}",
-                      max_rows=20000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q690: Cayley–Hamilton via Leverrier–Faddeev — three machines
-# on a corpus-derived integer matrix, every identity exact
-
-
-def _q690_mm(x: str, y: str, name: str) -> str:
-    return (f"{name} AS{{mat}} (SELECT x.i, y.j,"
-            f" CAST(sum(x.v*y.v) AS BIGINT) AS v\n"
-            f"         FROM {x} x JOIN {y} y ON y.i = x.j\n"
-            f"         GROUP BY x.i, y.j)")
-
-
-def _q690_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 4x4 integer matrix from the corpus (entries -4..5)
-        f"am AS{{mat}} (SELECT k {{d}} 4 AS i, k % 4 AS j, v"
-        f" FROM (\n"
-        f"           SELECT doc_id % 16 AS k,\n"
-        f"             CAST(sum(n_chars) % 10 - 4 AS BIGINT)"
-        f" AS v\n"
-        f"           FROM {tbl} GROUP BY doc_id % 16) t)",
-        # Leverrier–Faddeev chain: c_k = -tr(A M_{k-1} + ...)/k,
-        # with the INTEGRALITY of each division certified
-        "c1 AS{mat} (SELECT CAST(0 - sum(v) AS BIGINT) AS c"
-        " FROM am\n"
-        "         WHERE i = j)",
-        "g1 AS{mat} (SELECT a.i, a.j, a.v + CASE WHEN a.i = a.j\n"
-        "           THEN c.c ELSE 0 END AS v\n"
-        "         FROM am a CROSS JOIN c1 c)",
-        _q690_mm("am", "g1", "f2"),
-        "c2 AS{mat} (SELECT CAST((0 - sum(v)) {d} 2 AS BIGINT)"
-        " AS c,\n"
-        "           CAST(sum(v) % 2 AS BIGINT) AS r FROM f2\n"
-        "         WHERE i = j)",
-        "g2 AS{mat} (SELECT a.i, a.j, a.v + CASE WHEN a.i = a.j\n"
-        "           THEN c.c ELSE 0 END AS v\n"
-        "         FROM f2 a CROSS JOIN c2 c)",
-        _q690_mm("am", "g2", "f3"),
-        "c3 AS{mat} (SELECT CAST((0 - sum(v)) {d} 3 AS BIGINT)"
-        " AS c,\n"
-        "           CAST(sum(v) % 3 AS BIGINT) AS r FROM f3\n"
-        "         WHERE i = j)",
-        "g3 AS{mat} (SELECT a.i, a.j, a.v + CASE WHEN a.i = a.j\n"
-        "           THEN c.c ELSE 0 END AS v\n"
-        "         FROM f3 a CROSS JOIN c3 c)",
-        _q690_mm("am", "g3", "f4"),
-        "c4 AS{mat} (SELECT CAST((0 - sum(v)) {d} 4 AS BIGINT)"
-        " AS c,\n"
-        "           CAST(sum(v) % 4 AS BIGINT) AS r FROM f4\n"
-        "         WHERE i = j)",
-        "dvx AS (SELECT CAST((SELECT abs(r) FROM c2)\n"
-        "           + (SELECT abs(r) FROM c3)\n"
-        "           + (SELECT abs(r) FROM c4) AS BIGINT)"
-        " AS div_viol)",
-        # Faddeev terminal: M_4 + c_4 I = 0
-        "fz AS (SELECT CAST(sum(CASE WHEN a.v + CASE WHEN"
-        " a.i = a.j\n"
-        "           THEN c.c ELSE 0 END <> 0 THEN 1 ELSE 0 END)\n"
-        "           AS BIGINT) AS faddeev_viol\n"
-        "         FROM f4 a CROSS JOIN c4 c)",
-        # independent powers for Cayley–Hamilton and Newton
-        _q690_mm("am", "am", "p2"),
-        _q690_mm("p2", "am", "p3"),
-        _q690_mm("p3", "am", "p4"),
-        "ch AS (SELECT CAST(sum(CASE WHEN q4.v + k1.c*q3.v +\n"
-        "             k2.c*q2.v + k3.c*a.v + CASE WHEN"
-        " a.i = a.j\n"
-        "             THEN k4.c ELSE 0 END <> 0 THEN 1 ELSE 0"
-        " END)\n"
-        "           AS BIGINT) AS ch_viol\n"
-        "         FROM am a JOIN p2 q2 ON q2.i = a.i AND"
-        " q2.j = a.j\n"
-        "         JOIN p3 q3 ON q3.i = a.i AND q3.j = a.j\n"
-        "         JOIN p4 q4 ON q4.i = a.i AND q4.j = a.j\n"
-        "         CROSS JOIN c1 k1 CROSS JOIN c2 k2\n"
-        "         CROSS JOIN c3 k3 CROSS JOIN c4 k4)",
-        # Newton's identities on the power sums tr(A^k)
-        "nw AS (SELECT CAST(abs(t1.s + k1.c)\n"
-        "           + abs(t2.s + k1.c*t1.s + 2*k2.c)\n"
-        "           + abs(t3.s + k1.c*t2.s + k2.c*t1.s +"
-        " 3*k3.c)\n"
-        "           + abs(t4.s + k1.c*t3.s + k2.c*t2.s +"
-        " k3.c*t1.s\n"
-        "             + 4*k4.c) AS BIGINT) AS newton_viol\n"
-        "         FROM (SELECT sum(v) AS s FROM am WHERE i = j)"
-        " t1\n"
-        "         CROSS JOIN (SELECT sum(v) AS s FROM p2"
-        " WHERE i = j) t2\n"
-        "         CROSS JOIN (SELECT sum(v) AS s FROM p3"
-        " WHERE i = j) t3\n"
-        "         CROSS JOIN (SELECT sum(v) AS s FROM p4"
-        " WHERE i = j) t4\n"
-        "         CROSS JOIN c1 k1 CROSS JOIN c2 k2\n"
-        "         CROSS JOIN c3 k3 CROSS JOIN c4 k4)",
-        # third machine: det(lambda I - A) by 24-term Leibniz at
-        # five integer nodes must equal the Faddeev polynomial
-        f"lam AS (SELECT DISTINCT CAST(doc_id % 5 - 2 AS"
-        f" BIGINT) AS lv FROM {tbl})",
-        "pdq AS (SELECT CAST(p0 AS BIGINT) AS p0, CAST(p1 AS"
-        " BIGINT) AS p1,\n"
-        "           CAST(p2 AS BIGINT) AS p2, CAST(p3 AS"
-        " BIGINT) AS p3,\n"
-        "           CAST(sg AS BIGINT) AS sg FROM (VALUES"
-        " {perms})\n"
-        "           t(p0, p1, p2, p3, sg))",
-        "dl AS{mat} (SELECT w.lv, CAST(sum(p.sg\n"
-        "           * (CASE WHEN p.p0 = 0 THEN w.lv ELSE 0 END"
-        " - a0.v)\n"
-        "           * (CASE WHEN p.p1 = 1 THEN w.lv ELSE 0 END"
-        " - a1.v)\n"
-        "           * (CASE WHEN p.p2 = 2 THEN w.lv ELSE 0 END"
-        " - a2.v)\n"
-        "           * (CASE WHEN p.p3 = 3 THEN w.lv ELSE 0 END"
-        " - a3.v))\n"
-        "           AS BIGINT) AS dv\n"
-        "         FROM lam w CROSS JOIN pdq p\n"
-        "         JOIN am a0 ON a0.i = 0 AND a0.j = p.p0\n"
-        "         JOIN am a1 ON a1.i = 1 AND a1.j = p.p1\n"
-        "         JOIN am a2 ON a2.i = 2 AND a2.j = p.p2\n"
-        "         JOIN am a3 ON a3.i = 3 AND a3.j = p.p3\n"
-        "         GROUP BY w.lv)",
-        "ev AS (SELECT CAST(sum(CASE WHEN t.dv <>\n"
-        "             t.lv*t.lv*t.lv*t.lv + k1.c*t.lv*t.lv*t.lv\n"
-        "             + k2.c*t.lv*t.lv + k3.c*t.lv + k4.c\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS eval_viol\n"
-        "         FROM dl t CROSS JOIN c1 k1 CROSS JOIN c2 k2\n"
-        "         CROSS JOIN c3 k3 CROSS JOIN c4 k4)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT a.i, a.j, a.v AS a_v,\n"
-        "       k1.c AS c1_v, k2.c AS c2_v, k3.c AS c3_v,\n"
-        "       k4.c AS c4_v, d2.div_viol, z.faddeev_viol,\n"
-        "       h.ch_viol, n.newton_viol, e.eval_viol,"
-        " l.n_docs\n"
-        "FROM am a CROSS JOIN c1 k1 CROSS JOIN c2 k2\n"
-        "CROSS JOIN c3 k3 CROSS JOIN c4 k4 CROSS JOIN dvx d2\n"
-        "CROSS JOIN fz z CROSS JOIN ch h CROSS JOIN nw n\n"
-        "CROSS JOIN ev e CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q690_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q690_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{perms}", _Q686_PERMS))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q690_cayley_hamilton",
-       "WITH " + _q690_join("documents", "//", " MATERIALIZED"))
-def q690(spark, sf_dir):
-    """Cayley–Hamilton certified by three machines that share
-    nothing, on a corpus-derived 4x4 integer matrix (Cayley
-    1858, proven in general by Frobenius 1878; 'every matrix
-    satisfies its own characteristic polynomial' — the theorem
-    under minimal polynomials, matrix functions, and
-    Krylov-subspace solvers).  The matrix derives from
-    per-residue n_chars sums (entries -4..5, moving with SF).
-    Machine one is the Leverrier–Faddeev chain M_{k+1} =
-    A(M_k + c_k I), c_k = -tr(.)/k, run as relational
-    matrix-multiply stages with the INTEGRALITY of every
-    division certified (div_viol == 0 — each trace is exactly
-    divisible by k, itself a theorem) and the terminal identity
-    M_4 + c_4 I = 0 landing entrywise (faddeev_viol == 0).
-    Machine two recomputes p(A) = A^4 + c1 A^3 + c2 A^2 + c3 A
-    + c4 I from independently chained powers — zero at all 16
-    entries (ch_viol == 0, Cayley–Hamilton itself).  Machine
-    three evaluates det(lambda I - A) by the 24-term signed
-    Leibniz expansion at the five integer nodes -2..2 (a corpus
-    dim) and finds the Faddeev polynomial's values exactly
-    (eval_viol == 0 — two monic degree-4 polynomials agreeing
-    at five nodes are equal, q675's Vandermonde uniqueness
-    doing the pinning), while Newton's identities tie the
-    power sums tr(A^k) to the same coefficients (newton_viol ==
-    0).  Scale: matrix products are grouped equi-joins on a
-    16-row relation; the corpus aggregation is the only
-    data-sized stage — map-side combinable."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q690_documents")
-    parts, fin = _q690_sql("q690_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q690_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{perms}", _Q686_PERMS))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("am", "lam", "pdq", "dl") or \
-                nm[0] in "cgfp" and nm[1:].isdigit():
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q690_{nm}",
-                      max_rows=64)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q691: Smith normal form — explicit unimodular witness vs
-# determinantal-divisor gcds computed by exhaustive sweep
-
-
-_Q691_BM = '(0, 0, 2), (0, 1, 4), (0, 2, 4), (1, 0, -6), (1, 1, 6), (1, 2, 12), (2, 0, 10), (2, 1, -4), (2, 2, -16)'
-_Q691_UM = '(0, 0, 1), (0, 1, 0), (0, 2, 0), (1, 0, 3), (1, 1, 1), (1, 2, 0), (2, 0, 1), (2, 1, 2), (2, 2, 1)'
-_Q691_VM = '(0, 0, 1), (0, 1, 0), (0, 2, -2), (1, 0, 0), (1, 1, -1), (1, 2, 4), (2, 0, 0), (2, 1, 1), (2, 2, -3)'
-_Q691_SM = '(0, 2), (1, 6), (2, 12)'
-_Q691_PD3 = '(0, 1, 2, 1), (0, 2, 1, -1), (1, 0, 2, -1), (1, 2, 0, 1), (2, 0, 1, 1), (2, 1, 0, -1)'
-
-
-def _q691_det3(t: str) -> str:
-    return (f"SELECT CAST(sum(p.sg * a0.v * a1.v * a2.v) AS"
-            f" BIGINT) AS dv\n"
-            f"           FROM pd3 p\n"
-            f"           JOIN {t} a0 ON a0.i = 0 AND"
-            f" a0.j = p.p0\n"
-            f"           JOIN {t} a1 ON a1.i = 1 AND"
-            f" a1.j = p.p1\n"
-            f"           JOIN {t} a2 ON a2.i = 2 AND"
-            f" a2.j = p.p2")
-
-
-def _q691_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "bm AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        " BIGINT) AS j,\n"
-        "           CAST(v AS BIGINT) AS v FROM (VALUES {bm})"
-        " t(i, j, v))",
-        "um AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        " BIGINT) AS j,\n"
-        "           CAST(v AS BIGINT) AS v FROM (VALUES {um})"
-        " t(i, j, v))",
-        "vm AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        " BIGINT) AS j,\n"
-        "           CAST(v AS BIGINT) AS v FROM (VALUES {vm})"
-        " t(i, j, v))",
-        "sm AS (SELECT CAST(t AS BIGINT) AS t, CAST(s AS"
-        " BIGINT) AS s\n"
-        "         FROM (VALUES {sm}) t(t, s))",
-        "pd3 AS (SELECT CAST(p0 AS BIGINT) AS p0, CAST(p1 AS"
-        " BIGINT) AS p1,\n"
-        "           CAST(p2 AS BIGINT) AS p2, CAST(sg AS"
-        " BIGINT) AS sg\n"
-        "         FROM (VALUES {pd3}) t(p0, p1, p2, sg))",
-        f"gg AS (SELECT DISTINCT CAST(doc_id % 500 + 1 AS"
-        f" BIGINT) AS g FROM {tbl})",
-        # the unimodular witness: U B V computed relationally
-        "ub AS{mat} (SELECT x.i, y.j, CAST(sum(x.v*y.v) AS"
-        " BIGINT) AS v\n"
-        "         FROM um x JOIN bm y ON y.i = x.j\n"
-        "         GROUP BY x.i, y.j)",
-        "uv AS{mat} (SELECT x.i, y.j, CAST(sum(x.v*y.v) AS"
-        " BIGINT) AS v\n"
-        "         FROM ub x JOIN vm y ON y.i = x.j\n"
-        "         GROUP BY x.i, y.j)",
-        "sv AS (SELECT CAST(sum(CASE WHEN w.v <> CASE WHEN"
-        " w.i = w.j\n"
-        "           THEN s.s ELSE 0 END THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "           AS snf_viol\n"
-        "         FROM uv w LEFT JOIN sm s ON s.t = w.i)",
-        "du AS (SELECT CAST(CASE WHEN abs(t.dv) <> 1 THEN 1"
-        " ELSE 0 END\n"
-        "           + CASE WHEN abs(t2.dv) <> 1 THEN 1 ELSE 0"
-        " END\n"
-        "           AS BIGINT) AS unimod_viol FROM (\n"
-        "           " + _q691_det3("um") + ") t CROSS JOIN (\n"
-        "           " + _q691_det3("vm") + ") t2)",
-        # determinantal divisors by exhaustive divisor sweep
-        "mn AS{mat} (SELECT CAST(b11.v*b22.v - b12.v*b21.v AS"
-        " BIGINT) AS v\n"
-        "         FROM (SELECT 0 AS r1, 1 AS r2 UNION ALL"
-        " SELECT 0, 2\n"
-        "           UNION ALL SELECT 1, 2) rr\n"
-        "         CROSS JOIN (SELECT 0 AS c1, 1 AS c2 UNION ALL"
-        " SELECT 0, 2\n"
-        "           UNION ALL SELECT 1, 2) cc\n"
-        "         JOIN bm b11 ON b11.i = rr.r1 AND"
-        " b11.j = cc.c1\n"
-        "         JOIN bm b12 ON b12.i = rr.r1 AND"
-        " b12.j = cc.c2\n"
-        "         JOIN bm b21 ON b21.i = rr.r2 AND"
-        " b21.j = cc.c1\n"
-        "         JOIN bm b22 ON b22.i = rr.r2 AND"
-        " b22.j = cc.c2)",
-        "d1x AS (SELECT CAST(max(t.g) AS BIGINT) AS d1 FROM (\n"
-        "           SELECT g.g, sum(CASE WHEN b.v % g.g <> 0"
-        " THEN 1\n"
-        "             ELSE 0 END) AS bad\n"
-        "           FROM gg g CROSS JOIN bm b GROUP BY g.g) t\n"
-        "         WHERE t.bad = 0)",
-        "d2x AS (SELECT CAST(max(t.g) AS BIGINT) AS d2 FROM (\n"
-        "           SELECT g.g, sum(CASE WHEN m.v % g.g <> 0"
-        " THEN 1\n"
-        "             ELSE 0 END) AS bad\n"
-        "           FROM gg g CROSS JOIN mn m GROUP BY g.g) t\n"
-        "         WHERE t.bad = 0)",
-        "d3x AS (SELECT CAST(max(g.g) AS BIGINT) AS d3\n"
-        "         FROM gg g CROSS JOIN (\n"
-        "           " + _q691_det3("bm") + ") t\n"
-        "         WHERE abs(t.dv) % g.g = 0)",
-        # invariant factors == ratios of determinantal divisors
-        "dd AS (SELECT CAST(CASE WHEN s1.s <> x1.d1 THEN 1"
-        " ELSE 0 END\n"
-        "           + CASE WHEN s1.s*s2.s <> x2.d2 THEN 1"
-        " ELSE 0 END\n"
-        "           + CASE WHEN s1.s*s2.s*s3.s <> x3.d3 THEN 1\n"
-        "             ELSE 0 END AS BIGINT) AS dd_viol,\n"
-        "           CAST(CASE WHEN s2.s % s1.s <> 0 THEN 1"
-        " ELSE 0 END\n"
-        "           + CASE WHEN s3.s % s2.s <> 0 THEN 1 ELSE 0"
-        " END\n"
-        "           AS BIGINT) AS chain_viol,\n"
-        "           CAST(CASE WHEN x2.d2 % (x1.d1*x1.d1) <> 0"
-        " THEN 1\n"
-        "             ELSE 0 END\n"
-        "           + CASE WHEN (x1.d1*x3.d3) % (x2.d2*x2.d2)"
-        " <> 0\n"
-        "             THEN 1 ELSE 0 END AS BIGINT) AS dk_viol\n"
-        "         FROM (SELECT s FROM sm WHERE t = 0) s1\n"
-        "         CROSS JOIN (SELECT s FROM sm WHERE t = 1)"
-        " s2\n"
-        "         CROSS JOIN (SELECT s FROM sm WHERE t = 2)"
-        " s3\n"
-        "         CROSS JOIN d1x x1 CROSS JOIN d2x x2\n"
-        "         CROSS JOIN d3x x3)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT b.i, b.j, b.v AS b_v, w.v AS ubv_v,\n"
-        "       x1.d1, x2.d2, x3.d3, u.unimod_viol, s.snf_viol,\n"
-        "       d2.dd_viol, d2.chain_viol, d2.dk_viol,"
-        " l.n_docs\n"
-        "FROM bm b JOIN uv w ON w.i = b.i AND w.j = b.j\n"
-        "CROSS JOIN d1x x1 CROSS JOIN d2x x2 CROSS JOIN d3x"
-        " x3\n"
-        "CROSS JOIN du u CROSS JOIN sv s CROSS JOIN dd d2\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q691_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q691_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{bm}", _Q691_BM).replace("{um}",
-                                                _Q691_UM)
-             .replace("{vm}", _Q691_VM).replace("{sm}",
-                                                _Q691_SM)
-             .replace("{pd3}", _Q691_PD3))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q691_smith_normal_form",
-       "WITH " + _q691_join("documents", "//", " MATERIALIZED"))
-def q691(spark, sf_dir):
-    """Smith normal form with two machines that share nothing:
-    an explicit unimodular witness and the determinantal-
-    divisor gcds computed by exhaustive sweep (Smith 1861; the
-    canonical form that classifies finitely generated abelian
-    groups, lattice quotients, and integer linear systems —
-    Z^3/BZ^3 = Z_2 x Z_6 x Z_12 for this B).  The witness
-    machine verifies U B V = diag(2, 6, 12) entrywise by
-    relational matrix products (snf_viol == 0) with BOTH
-    transforms certified unimodular via the 6-term Leibniz
-    determinant, |det U| = |det V| = 1 (unimod_viol == 0) — so
-    the diagonal is REACHABLE by integer row/column operations.
-    The canonicity machine computes the determinantal divisors
-    with no linear algebra at all: D1 = gcd of all 9 entries,
-    D2 = gcd of all 9 2x2 minors, D3 = |det B|, each gcd found
-    by sweeping a 500-value corpus divisor dim (max g dividing
-    everything — gcd by exhaustion, 2/12/144).  The two
-    machines are then welded by the invariant-factor theorem:
-    s1 = D1, s1 s2 = D2, s1 s2 s3 = D3 exactly (dd_viol == 0)
-    — the witness's diagonal is THE canonical one, not just a
-    diagonalization — with the divisibility chain s1 | s2 | s3
-    (chain_viol == 0) and the divisor-ratio theorem D_k^2 |
-    D_{k-1} D_{k+1} (dk_viol == 0) riding along.  Scale: dims
-    and one 4500-row divisor sweep — grouped joins throughout."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q691_documents")
-    parts, fin = _q691_sql("q691_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q691_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{bm}", _Q691_BM).replace("{um}",
-                                                 _Q691_UM)
-              .replace("{vm}", _Q691_VM).replace("{sm}",
-                                                 _Q691_SM)
-              .replace("{pd3}", _Q691_PD3))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("bm", "um", "vm", "sm", "pd3", "gg", "ub",
-                  "uv", "mn"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q691_{nm}",
-                      max_rows=600)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q692: Euler line + nine-point circle — exact rational proofs
-# on corpus-derived integer triangles, denominators cleared
-
-
-def _q692_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # five corpus triangles: 15 residue groups give 5 classes
-        # x 3 vertices, coordinates in [-4, 4]
-        f"cg AS (SELECT k {{d}} 3 AS c, k % 3 AS r,\n"
-        f"           CAST(sum(n_chars) % 9 - 4 AS BIGINT) AS"
-        f" px,\n"
-        f"           CAST(sum(n_chars * (doc_id % 7 + 1)) % 9"
-        f" - 4\n"
-        f"             AS BIGINT) AS py FROM (\n"
-        f"           SELECT doc_id % 15 AS k, doc_id, n_chars"
-        f" FROM {tbl}) t\n"
-        f"         GROUP BY k {{d}} 3, k % 3)",
-        "tv AS (SELECT c,\n"
-        "           max(CASE WHEN r = 0 THEN px END) AS ax,\n"
-        "           max(CASE WHEN r = 0 THEN py END) AS ay,\n"
-        "           max(CASE WHEN r = 1 THEN px END) AS bx,\n"
-        "           max(CASE WHEN r = 1 THEN py END) AS bby,\n"
-        "           max(CASE WHEN r = 2 THEN px END) AS ccx,\n"
-        "           max(CASE WHEN r = 2 THEN py END) AS cy\n"
-        "         FROM cg GROUP BY c)",
-        # nondegenerate triangles with circumcenter (Cramer) and
-        # orthocenter (altitude intersection, Cramer) attached
-        "t1 AS (SELECT c, ax, ay, bx, bby, ccx, cy,\n"
-        "           2*(bx-ax)*2*(cy-ay) - 2*(bby-ay)*2*(ccx-ax)"
-        " AS dq,\n"
-        "           (bx*bx + bby*bby - ax*ax - ay*ay)*2*(cy-ay)\n"
-        "             - 2*(bby-ay)*(ccx*ccx + cy*cy - ax*ax -"
-        " ay*ay)\n"
-        "             AS oxn,\n"
-        "           2*(bx-ax)*(ccx*ccx + cy*cy - ax*ax - ay*ay)\n"
-        "             - (bx*bx + bby*bby - ax*ax - ay*ay)*"
-        "2*(ccx-ax)\n"
-        "             AS oyn,\n"
-        "           (ccx-bx)*(cy-ay) - (cy-bby)*(ccx-ax) AS dh,\n"
-        "           (ax*(ccx-bx) + ay*(cy-bby))*(cy-ay)\n"
-        "             - (cy-bby)*(bx*(ccx-ax) + bby*(cy-ay))"
-        " AS hxn,\n"
-        "           (ccx-bx)*(bx*(ccx-ax) + bby*(cy-ay))\n"
-        "             - (ax*(ccx-bx) + ay*(cy-bby))*(ccx-ax)"
-        " AS hyn,\n"
-        "           ax + bx + ccx AS sx, ay + bby + cy AS sy\n"
-        "         FROM tv\n"
-        "         WHERE (bx-ax)*(cy-ay) - (bby-ay)*(ccx-ax)"
-        " <> 0)",
-        "t2 AS (SELECT t.*,\n"
-        "           (oxn - ax*dq)*(oxn - ax*dq) + (oyn - ay*dq)"
-        "*(oyn - ay*dq) AS rn\n"
-        "         FROM t1 t)",
-        # per-triangle certificate columns
-        "t3 AS (SELECT t.*,\n"
-        "           CASE WHEN (oxn - bx*dq)*(oxn - bx*dq)\n"
-        "             + (oyn - bby*dq)*(oyn - bby*dq) <> rn\n"
-        "             OR (oxn - ccx*dq)*(oxn - ccx*dq)\n"
-        "             + (oyn - cy*dq)*(oyn - cy*dq) <> rn\n"
-        "             THEN 1 ELSE 0 END AS circ_viol,\n"
-        "           CASE WHEN (hxn - ccx*dh)*(bx - ax)\n"
-        "             + (hyn - cy*dh)*(bby - ay) <> 0\n"
-        "             THEN 1 ELSE 0 END AS concur_viol,\n"
-        "           CASE WHEN hxn*dq <> (sx*dq - 2*oxn)*dh\n"
-        "             OR hyn*dq <> (sy*dq - 2*oyn)*dh\n"
-        "             THEN 1 ELSE 0 END AS euler_viol,\n"
-        "           CASE WHEN (hxn*dq - oxn*dh)*(sy*dq - 3*oyn)"
-        " <>\n"
-        "             (hyn*dq - oyn*dh)*(sx*dq - 3*oxn)\n"
-        "             OR (hxn*dq - oxn*dh)*(hxn*dq - oxn*dh)\n"
-        "             + (hyn*dq - oyn*dh)*(hyn*dq - oyn*dh) <>\n"
-        "             ((sx*dq - 3*oxn)*(sx*dq - 3*oxn)\n"
-        "             + (sy*dq - 3*oyn)*(sy*dq - 3*oyn))*dh*dh\n"
-        "             THEN 1 ELSE 0 END AS ratio_viol,\n"
-        "           CASE WHEN\n"
-        "             (sx*dq - oxn - (ax+bx)*dq)*(sx*dq - oxn -"
-        " (ax+bx)*dq)\n"
-        "             + (sy*dq - oyn - (ay+bby)*dq)*(sy*dq -"
-        " oyn - (ay+bby)*dq)\n"
-        "             <> rn OR\n"
-        "             (sx*dq - oxn - (bx+ccx)*dq)*(sx*dq - oxn"
-        " - (bx+ccx)*dq)\n"
-        "             + (sy*dq - oyn - (bby+cy)*dq)*(sy*dq -"
-        " oyn - (bby+cy)*dq)\n"
-        "             <> rn OR\n"
-        "             (sx*dq - oxn - (ax+ccx)*dq)*(sx*dq - oxn"
-        " - (ax+ccx)*dq)\n"
-        "             + (sy*dq - oyn - (ay+cy)*dq)*(sy*dq - oyn"
-        " - (ay+cy)*dq)\n"
-        "             <> rn THEN 1 ELSE 0 END AS mid_viol\n"
-        "         FROM t2 t)",
-        # altitude feet: the remaining three nine-point members
-        "t4 AS (SELECT t.*, CASE WHEN\n" + "".join((
-        "             ((sx*dq - oxn)*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               - 2*dq*({qx}*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               + (({px}-{qx})*({rx}-{qx}) +"
-        " ({py}-{qy})*({ry}-{qy}))*({rx}-{qx})))\n"
-        "             * ((sx*dq - oxn)*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               - 2*dq*({qx}*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               + (({px}-{qx})*({rx}-{qx}) +"
-        " ({py}-{qy})*({ry}-{qy}))*({rx}-{qx})))\n"
-        "             + ((sy*dq - oyn)*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               - 2*dq*({qy}*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               + (({px}-{qx})*({rx}-{qx}) +"
-        " ({py}-{qy})*({ry}-{qy}))*({ry}-{qy})))\n"
-        "             * ((sy*dq - oyn)*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               - 2*dq*({qy}*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               + (({px}-{qx})*({rx}-{qx}) +"
-        " ({py}-{qy})*({ry}-{qy}))*({ry}-{qy})))\n"
-        "             <> rn*(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy}))\n"
-        "               *(({rx}-{qx})*({rx}-{qx})"
-        " + ({ry}-{qy})*({ry}-{qy})) OR\n").format(
-            px=p, py=py, qx=q, qy=qy, rx=r, ry=ry)
-            for (p, py, q, qy, r, ry) in (
-                ("ax", "ay", "bx", "bby", "ccx", "cy"),
-                ("bx", "bby", "ccx", "cy", "ax", "ay"),
-                ("ccx", "cy", "ax", "ay", "bx", "bby"))) +
-        "             1 = 0 THEN 1 ELSE 0 END AS feet_viol\n"
-        "         FROM t3 t)",
-        f"nt AS (SELECT CAST(count(*) AS BIGINT) AS n_tri"
-        f" FROM t4)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.c, t.ax, t.ay, t.bx, t.bby, t.ccx, t.cy,\n"
-        "       CAST(t.circ_viol AS BIGINT) AS circ_viol,\n"
-        "       CAST(t.concur_viol AS BIGINT) AS concur_viol,\n"
-        "       CAST(t.euler_viol AS BIGINT) AS euler_viol,\n"
-        "       CAST(t.ratio_viol AS BIGINT) AS ratio_viol,\n"
-        "       CAST(t.mid_viol AS BIGINT) AS mid_viol,\n"
-        "       CAST(t.feet_viol AS BIGINT) AS feet_viol,\n"
-        "       n.n_tri, l.n_docs\n"
-        "FROM t4 t CROSS JOIN nt n CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q692_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q692_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q692_euler_line",
-       "WITH " + _q692_join("documents", "//", ""))
-def q692(spark, sf_dir):
-    """The Euler line and the nine-point circle proven in exact
-    integer arithmetic on corpus-derived triangles (Euler 1765;
-    Feuerbach/Poncelet for the nine-point circle — the
-    classical concurrences that make 'triangle centers' a
-    subject, here with every denominator cleared so each
-    classical theorem is a BIGINT identity).  Five triangles
-    derive from 15 corpus residue groups (coordinates in
-    [-4,4], moving with SF; degenerate classes filtered by the
-    area test, count emitted).  Per triangle: the circumcenter
-    O comes from Cramer on the perpendicular bisectors and is
-    certified equidistant from all three vertices (circ_viol ==
-    0); the orthocenter H comes INDEPENDENTLY from Cramer on
-    two altitudes and the third altitude is certified to pass
-    through it (concur_viol == 0 — the altitude concurrence
-    theorem); the two meet in Euler's vector identity H =
-    A + B + C - 2O, verified cross-denominator (euler_viol ==
-    0), which forces O, G, H collinear with |OH| = 3|OG| —
-    certified directly from the independent H by the cleared
-    collinearity determinant and the squared-ratio identity
-    (ratio_viol == 0).  The nine-point circle then lands with
-    center N = (S*Dq - O)/(2Dq) and radius R/2: all three side
-    midpoints satisfy |N - M|^2 = (R/2)^2 EXACTLY as the
-    numerator identity numM == R^2num (mid_viol == 0), and all
-    three altitude feet satisfy numF == R^2num * df^2 across
-    their projection denominators (feet_viol == 0) — six of the
-    nine points, each an exact integer equation (the vertex-H
-    midpoints share the same algebra).  Scale: one 15-group
-    corpus aggregation; everything after is a 5-row column
-    pipeline."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q692_documents")
-    parts, fin = _q692_sql("q692_documents", "div", "")
-    kept = [fr.replace("{mat}", "").replace("{d}", "div")
-            for fr in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q693: Routh's theorem — cevian-triangle areas as exact
-# homogeneous-coordinate arithmetic over the full ratio grid
-
-
-def _q693_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d4 AS (SELECT DISTINCT CAST(doc_id % 4 + 1 AS"
-        f" BIGINT) AS v FROM {tbl})",
-        # reference triangle A=(0,0,1) B=(1,0,1) C=(0,1,1);
-        # cevian feet D=(x,1,1+x) E=(0,y,1+y) F=(1,0,1+z) from
-        # CD:DB = x, AE:EC = y, BF:FA = z; lines by cross product
-        "lns AS (SELECT x.v AS x, y.v AS y, z.v AS z,\n"
-        "           CAST(-1 AS BIGINT) AS la1, x.v AS la2,\n"
-        "           CAST(0 AS BIGINT) AS la3,\n"
-        "           -y.v AS lb1, -(1 + y.v) AS lb2, y.v AS"
-        " lb3,\n"
-        "           1 + z.v AS lc1, CAST(1 AS BIGINT) AS lc2,\n"
-        "           CAST(-1 AS BIGINT) AS lc3\n"
-        "         FROM d4 x CROSS JOIN d4 y CROSS JOIN d4 z)",
-        # pairwise cevian intersections, still homogeneous
-        "pts AS (SELECT x, y, z,\n"
-        "           lb2*lc3 - lb3*lc2 AS p1x, lb3*lc1 -"
-        " lb1*lc3 AS p1y,\n"
-        "           lb1*lc2 - lb2*lc1 AS p1w,\n"
-        "           lc2*la3 - lc3*la2 AS p2x, lc3*la1 -"
-        " lc1*la3 AS p2y,\n"
-        "           lc1*la2 - lc2*la1 AS p2w,\n"
-        "           la2*lb3 - la3*lb2 AS p3x, la3*lb1 -"
-        " la1*lb3 AS p3y,\n"
-        "           la1*lb2 - la2*lb1 AS p3w\n"
-        "         FROM lns)",
-        "dts AS (SELECT x, y, z,\n"
-        "           p1x*(p2y*p3w - p2w*p3y)\n"
-        "           - p1y*(p2x*p3w - p2w*p3x)\n"
-        "           + p1w*(p2x*p3y - p2y*p3x) AS det3,\n"
-        "           p1w*p2w*p3w AS wprod\n"
-        "         FROM pts)",
-        # Routh's closed form, cross-multiplied exactly, and the
-        # Ceva degenerate case as an iff
-        "rv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN abs(det3)*((x*y + y +"
-        " 1)*(y*z + z + 1)\n"
-        "             *(z*x + x + 1)) <> (x*y*z - 1)*(x*y*z -"
-        " 1)*abs(wprod)\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS routh_viol,\n"
-        "           CAST(sum(CASE WHEN (CASE WHEN det3 = 0"
-        " THEN 1 ELSE 0 END)\n"
-        "             <> (CASE WHEN x*y*z = 1 THEN 1 ELSE 0"
-        " END)\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS ceva_viol\n"
-        "         FROM dts)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.x, t.y, t.z, abs(t.det3) AS area_num,\n"
-        "       abs(t.wprod) AS area_den,\n"
-        "       (t.x*t.y*t.z - 1)*(t.x*t.y*t.z - 1) AS"
-        " closed_num,\n"
-        "       (t.x*t.y + t.y + 1)*(t.y*t.z + t.z + 1)\n"
-        "         *(t.z*t.x + t.x + 1) AS closed_den,\n"
-        "       r.routh_viol, r.ceva_viol, l.n_docs\n"
-        "FROM dts t CROSS JOIN rv r CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q693_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q693_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q693_routh_theorem",
-       "WITH " + _q693_join("documents", "//", ""))
-def q693(spark, sf_dir):
-    """Routh's theorem verified exactly over the full cevian
-    ratio grid — homogeneous integer coordinates, no division
-    anywhere (Routh 1896; the closed form for the triangle cut
-    off by three cevians, with Ceva's concurrence as its zero
-    locus and the famous one-seventh-area triangle at ratio 2).
-    All 64 ratio triples (x, y, z) in 1..4 come from a corpus
-    dim; on the reference triangle the cevian feet are the
-    homogeneous points D = (x,1,1+x), E = (0,y,1+y),
-    F = (1,0,1+z) (CD:DB = x, AE:EC = y, BF:FA = z), cevian
-    lines are point cross products, their pairwise
-    intersections are line cross products, and the inner
-    triangle's area ratio is |det(P1,P2,P3)| / |w1 w2 w3| —
-    every entry an integer.  Routh's closed form
-    (xyz-1)^2 / ((xy+y+1)(yz+z+1)(zx+x+1)) is then certified
-    by exact cross-multiplication on ALL 64 triples (routh_viol
-    == 0), the emitted rows carrying both fractions unreduced —
-    (2,2,2) shows 343/2401 = 1/7, the one-seventh triangle.
-    Ceva's theorem falls out as a genuine iff on the same data:
-    det = 0 EXACTLY when xyz = 1 (ceva_viol == 0, both
-    directions over the whole grid) — q676's concurrence
-    criterion recovered as the degenerate locus of an area
-    formula.  Scale: a 64-row dim pipeline; certificate cost
-    independent of corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q693_documents")
-    parts, fin = _q693_sql("q693_documents", "div", "")
-    kept = [fr.replace("{mat}", "").replace("{d}", "div")
-            for fr in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q694: the secretary problem — optimal stopping by total
-# 5040-permutation exhaustion, welded to the odds closed form
-
-
-def _q694_sql(tbl: str, d: str, mat: str):
-    perm_chain = "FROM el7 a1"
-    for i in range(2, 8):
-        conds = " AND ".join(f"a{i}.e <> a{j}.e"
-                             for j in range(1, i))
-        perm_chain += f"\n         JOIN el7 a{i} ON {conds}"
-    cols = ", ".join(f"a{i}.e AS v{i}" for i in range(1, 8))
-    # position of the best candidate (value 7)
-    pos7 = ("CASE WHEN v1 = 7 THEN 1 WHEN v2 = 7 THEN 2"
-            " WHEN v3 = 7 THEN 3 WHEN v4 = 7 THEN 4"
-            " WHEN v5 = 7 THEN 5 WHEN v6 = 7 THEN 6"
-            " ELSE 7 END")
-    gmax = ["0", "v1", "greatest(v1, v2)",
-            "greatest(v1, v2, v3)", "greatest(v1, v2, v3, v4)",
-            "greatest(v1, v2, v3, v4, v5)",
-            "greatest(v1, v2, v3, v4, v5, v6)"]
-    thr = ("CASE r.r " + " ".join(
-        f"WHEN {r} THEN {gmax[r]}" for r in range(7)) + " END")
-    pbefore = ("CASE p7 " + " ".join(
-        f"WHEN {k} THEN {gmax[k - 1]}"
-        for k in range(1, 8)) + " END")
-    parts = [
-        f"el7 AS (SELECT DISTINCT CAST(doc_id % 7 + 1 AS"
-        f" BIGINT) AS e FROM {tbl})",
-        f"rd AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS r FROM {tbl})",
-        f"jd AS (SELECT DISTINCT CAST(doc_id % 6 + 1 AS"
-        f" BIGINT) AS j FROM {tbl})",
-        "pm AS{mat} (SELECT " + cols + "\n         "
-        + perm_chain + ")",
-        "px AS{mat} (SELECT v1, v2, v3, v4, v5, v6, v7,\n"
-        "           " + pos7 + " AS p7 FROM pm)",
-        # the classic cutoff rule: observe r, then take the first
-        # record; success iff the best arrives after r and no
-        # record intervenes — exhaustive over all 5040 x 7 (r)
-        "sc AS{mat} (SELECT r.r, CAST(sum(CASE\n"
-        "           WHEN r.r = 0 THEN CASE WHEN p.p7 = 1 THEN 1"
-        " ELSE 0 END\n"
-        "           WHEN p.p7 > r.r AND " + pbefore + " =\n"
-        "             " + thr + " THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS succ\n"
-        "         FROM rd r CROSS JOIN px p GROUP BY r.r)",
-        # the odds closed form: succ(r) = 720 r sum_{j=r..6} 1/j,
-        # exact because 720 r is divisible by every j <= 6
-        "cf AS (SELECT r.r,\n"
-        "           CAST(sum((720*r.r) {d} j.j) AS BIGINT) AS"
-        " closed,\n"
-        "           CAST(sum((720*r.r) % j.j) AS BIGINT) AS"
-        " divres\n"
-        "         FROM rd r JOIN jd j ON j.j >= r.r\n"
-        "         WHERE r.r >= 1 GROUP BY r.r\n"
-        "         UNION ALL SELECT CAST(0 AS BIGINT),\n"
-        "           CAST(720 AS BIGINT), CAST(0 AS BIGINT))",
-        "fv AS (SELECT CAST(sum(CASE WHEN s.succ <> c.closed\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " form_viol,\n"
-        "           CAST(sum(abs(c.divres)) AS BIGINT) AS"
-        " div_viol\n"
-        "         FROM sc s JOIN cf c ON c.r = s.r)",
-        # the optimum, from the exhaustive counts (tie-free)
-        "op AS (SELECT CAST(max(succ*8 + (7 - r)) % 8 AS"
-        " BIGINT) AS x,\n"
-        "           CAST(7 - max(succ*8 + (7 - r)) % 8 AS"
-        " BIGINT) AS opt_r,\n"
-        "           CAST(max(succ) AS BIGINT) AS opt_succ"
-        " FROM sc)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT s.r, s.succ, c.closed, f.form_viol,"
-        " f.div_viol,\n"
-        "       o.opt_r, o.opt_succ, l.n_docs\n"
-        "FROM sc s JOIN cf c ON c.r = s.r\n"
-        "CROSS JOIN fv f CROSS JOIN op o CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q694_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q694_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q694_secretary_problem",
-       "WITH " + _q694_join("documents", "//", " MATERIALIZED"))
-def q694(spark, sf_dir):
-    """The secretary problem solved by total exhaustion at
-    n = 7 — every cutoff rule scored on every arrival order,
-    then welded to the odds-theorem closed form (Lindley 1961,
-    Dynkin 1963; the 1/e law of optimal stopping, and the
-    textbook model for irrevocable hiring/acceptance
-    decisions).  All 5040 arrival permutations materialize by a
-    7-way distinct join; for each cutoff r (observe the first
-    r candidates, then accept the first record) success is
-    decided by pure column arithmetic — the best candidate must
-    arrive after position r with no intervening record, i.e.
-    the prefix max before its position equals the threshold max
-    — and the exhaustive success counts land per r: 720, 1764,
-    2088, 2052, 1776, 1320, 720.  The closed form succ(r) =
-    720 r sum_{j=r..6} 1/j is certified EXACTLY (form_viol ==
-    0) with the divisibility that makes it integer-exact
-    itself certified (div_viol == 0: 720 r is divisible by
-    every j <= 6 — no fractions were harmed).  The optimum is
-    read off the exhaustive counts tie-free: opt_r == 2 with
-    2088/5040 = 41.4% success — n/e = 2.58 rounds DOWN here,
-    the finite-n wobble the asymptotic 1/e story hides, and
-    exactly why the exhaustive machine matters.  Scale: one
-    5040 x 7 grouped join; the certificate is corpus-size
-    independent."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q694_documents")
-    parts, fin = _q694_sql("q694_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q694_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("el7", "rd", "jd", "pm", "px", "sc"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q694_{nm}",
-                      max_rows=6000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q695: Fine and Wilf's periodicity theorem — total exhaustion
-# over all 2^14 binary strings, with the bound's tightness
-
-
-_Q695_GD = '(1, 2, 1), (1, 3, 1), (1, 4, 1), (1, 5, 1), (1, 6, 1), (1, 7, 1), (1, 8, 1), (1, 9, 1), (1, 10, 1), (1, 11, 1), (1, 12, 1), (1, 13, 1), (1, 14, 1), (2, 3, 1), (2, 4, 2), (2, 5, 1), (2, 6, 2), (2, 7, 1), (2, 8, 2), (2, 9, 1), (2, 10, 2), (2, 11, 1), (2, 12, 2), (2, 13, 1), (2, 14, 2), (3, 4, 1), (3, 5, 1), (3, 6, 3), (3, 7, 1), (3, 8, 1), (3, 9, 3), (3, 10, 1), (3, 11, 1), (3, 12, 3), (3, 13, 1), (3, 14, 1), (4, 5, 1), (4, 6, 2), (4, 7, 1), (4, 8, 4), (4, 9, 1), (4, 10, 2), (4, 11, 1), (4, 12, 4), (4, 13, 1), (4, 14, 2), (5, 6, 1), (5, 7, 1), (5, 8, 1), (5, 9, 1), (5, 10, 5), (5, 11, 1), (5, 12, 1), (5, 13, 1), (5, 14, 1), (6, 7, 1), (6, 8, 2), (6, 9, 3), (6, 10, 2), (6, 11, 1), (6, 12, 6), (6, 13, 1), (6, 14, 2), (7, 8, 1), (7, 9, 1), (7, 10, 1), (7, 11, 1), (7, 12, 1), (7, 13, 1), (7, 14, 7), (8, 9, 1), (8, 10, 2), (8, 11, 1), (8, 12, 4), (8, 13, 1), (8, 14, 2), (9, 10, 1), (9, 11, 1), (9, 12, 3), (9, 13, 1), (9, 14, 1), (10, 11, 1), (10, 12, 2), (10, 13, 1), (10, 14, 2), (11, 12, 1), (11, 13, 1), (11, 14, 1), (12, 13, 1), (12, 14, 2), (13, 14, 1)'
-
-
-def _q695_sql(tbl: str, d: str, mat: str):
-    bitc = ("CASE t.i " + " ".join(
-        f"WHEN {i} THEN (c.code {{d}} {2 ** i}) % 2"
-        for i in range(14)) + " END")
-    parts = [
-        f"b128 AS (SELECT DISTINCT CAST(doc_id % 128 AS"
-        f" BIGINT) AS b FROM {tbl})",
-        f"i14 AS (SELECT DISTINCT CAST(doc_id % 14 AS BIGINT)"
-        f" AS i FROM {tbl})",
-        "gd AS (SELECT CAST(p AS BIGINT) AS p, CAST(q AS"
-        " BIGINT) AS q,\n"
-        "           CAST(g AS BIGINT) AS g FROM (VALUES {gd})"
-        " t(p, q, g))",
-        "cc AS{mat} (SELECT hi.b*128 + lo.b AS code\n"
-        "         FROM b128 hi CROSS JOIN b128 lo)",
-        # per-position bit table for all 16384 strings
-        "bt AS{mat} (SELECT c.code, t.i, CAST(" + bitc + " AS"
-        " BIGINT) AS bit\n"
-        "         FROM cc c CROSS JOIN i14 t)",
-        # p is a period iff s[i] = s[i+p] for every valid i
-        "pp AS{mat} (SELECT t.code, t.p FROM (\n"
-        "           SELECT b1.code, q.i + 1 AS p,\n"
-        "             sum(CASE WHEN b1.bit <> b2.bit THEN 1"
-        " ELSE 0 END)\n"
-        "               AS bad,\n"
-        "             count(*) AS npos\n"
-        "           FROM i14 q\n"
-        "           JOIN bt b1 ON b1.i < 14 - (q.i + 1)\n"
-        "             OR (q.i = 13 AND b1.i = 0)\n"
-        "           JOIN bt b2 ON b2.code = b1.code AND\n"
-        "             b2.i = CASE WHEN q.i = 13 THEN b1.i\n"
-        "               ELSE b1.i + q.i + 1 END\n"
-        "           GROUP BY b1.code, q.i + 1) t\n"
-        "         WHERE t.bad = 0 OR t.p = 14)",
-        # the period-count identity: exactly 2^p strings of
-        # length 14 admit period p (determined by first p bits)
-        "pcv AS (SELECT CAST(sum(CASE WHEN t.n <> t.exp2"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS count_viol FROM (\n"
-        "           SELECT p, count(*) AS n,\n"
-        "             CAST(" + " ".join([
-            "CASE p"] + [f"WHEN {p} THEN {2 ** p}"
-                         for p in range(1, 15)]) + " END AS"
-        " BIGINT) AS exp2\n"
-        "           FROM pp GROUP BY p) t)",
-        # Fine–Wilf: periods p < q with p + q - gcd <= 14 force
-        # period gcd(p, q) — zero violations over the universe
-        "fw AS (SELECT\n"
-        "           CAST(sum(CASE WHEN g.g IS NOT NULL AND\n"
-        "             p1.p + p2.p - g.g <= 14 AND gp.p IS NULL\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS fw_viol,\n"
-        "           CAST(sum(CASE WHEN g.g IS NOT NULL AND\n"
-        "             p1.p + p2.p - g.g > 14 AND gp.p IS NULL\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " n_tight\n"
-        "         FROM pp p1\n"
-        "         JOIN pp p2 ON p2.code = p1.code AND"
-        " p2.p > p1.p\n"
-        "         LEFT JOIN gd g ON g.p = p1.p AND g.q = p2.p\n"
-        "         LEFT JOIN pp gp ON gp.code = p1.code AND"
-        " gp.p = g.g)",
-        "nc AS (SELECT CAST(count(*) AS BIGINT) AS n_codes"
-        " FROM cc)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.p, t.n AS n_with_period,\n"
-        "       v.count_viol, f.fw_viol, f.n_tight,\n"
-        "       c.n_codes, l.n_docs\n"
-        "FROM (SELECT p, CAST(count(*) AS BIGINT) AS n FROM pp"
-        " GROUP BY p) t\n"
-        "CROSS JOIN pcv v CROSS JOIN fw f CROSS JOIN nc c\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q695_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q695_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{gd}", _Q695_GD))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q695_fine_wilf",
-       "WITH " + _q695_join("documents", "//", " MATERIALIZED"))
-def q695(spark, sf_dir):
-    """Fine and Wilf's periodicity theorem by total exhaustion
-    — all 16384 binary strings of length 14, every period pair
-    checked, and the bound's tightness COUNTED (Fine & Wilf
-    1965; the interaction lemma under every stringology result
-    from KMP failure functions to repetition detection: two
-    periods p, q coexisting long enough force period gcd(p,q)).
-    The universe materializes from two 128-value corpus dims;
-    p is a period of s iff s[i] = s[i+p] for all valid i,
-    computed for all 16384 x 14 (code, p) pairs from a bit
-    table (the length-14 period is vacuous-true by convention).
-    Three certificates: (1) the period-count identity — exactly
-    2^p strings admit period p, since a p-periodic string is
-    determined by its first p bits (count_viol == 0, fourteen
-    exact counts); (2) the theorem itself — over every string
-    and every period pair p < q with p + q - gcd(p,q) <= 14,
-    the gcd is ALWAYS also a period (fw_viol == 0, the full
-    universe swept); (3) necessity of the length hypothesis —
-    pairs beyond the bound genuinely fail, n_tight == 21552
-    (code, p, q) triples have both periods but NOT the gcd, so
-    the Fine–Wilf length p + q - gcd is not just sufficient
-    but needed (the classical length-(p+q-gcd-1) witnesses
-    live inside these counts).  Scale: the period sweep is one
-    1.5M-row grouped join; everything downstream is dim-sized."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q695_documents")
-    parts, fin = _q695_sql("q695_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q695_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{gd}", _Q695_GD))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("b128", "i14", "gd", "cc", "bt", "pp"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q695_{nm}",
-                      max_rows=250000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q696: the partition function — coin DP, Euler's pentagonal
-# recurrence, odd = distinct, and Ramanujan congruences
-
-
-def _q696_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"n21 AS{{mat}} (SELECT DISTINCT CAST(doc_id % 21 AS"
-        f" BIGINT) AS n FROM {tbl})",
-        "gp AS (SELECT CAST(g AS BIGINT) AS g, CAST(sg AS"
-        " BIGINT) AS sg\n"
-        "         FROM (VALUES (1, 1), (2, 1), (5, -1),"
-        " (7, -1),\n"
-        "           (12, 1), (15, 1)) t(g, sg))",
-        "a0 AS (SELECT n, CAST(CASE WHEN n = 0 THEN 1 ELSE 0"
-        " END\n"
-        "           AS BIGINT) AS w FROM n21)",
-        "b0 AS (SELECT n, CAST(CASE WHEN n = 0 THEN 1 ELSE 0"
-        " END\n"
-        "           AS BIGINT) AS w FROM n21)",
-        "d0 AS (SELECT n, CAST(CASE WHEN n = 0 THEN 1 ELSE 0"
-        " END\n"
-        "           AS BIGINT) AS w FROM n21)",
-    ]
-    # unrestricted parts: unbounded coin k, one reference/stage
-    for k in range(1, 21):
-        parts.append(
-            f"a{k} AS{{mat}} (SELECT c.n, CAST(sum(o.w) AS"
-            f" BIGINT) AS w\n"
-            f"         FROM n21 c JOIN a{k - 1} o ON"
-            f" o.n <= c.n\n"
-            f"           AND (c.n - o.n) % {k} = 0"
-            f" GROUP BY c.n)")
-    # odd parts only
-    prev = "b0"
-    for k in range(1, 21, 2):
-        parts.append(
-            f"b{k} AS{{mat}} (SELECT c.n, CAST(sum(o.w) AS"
-            f" BIGINT) AS w\n"
-            f"         FROM n21 c JOIN {prev} o ON o.n <= c.n\n"
-            f"           AND (c.n - o.n) % {k} = 0"
-            f" GROUP BY c.n)")
-        prev = f"b{k}"
-    # distinct parts: 0/1 use of k via an OR join (one reference)
-    for k in range(1, 21):
-        parts.append(
-            f"d{k} AS{{mat}} (SELECT c.n, CAST(sum(o.w) AS"
-            f" BIGINT) AS w\n"
-            f"         FROM n21 c JOIN d{k - 1} o ON"
-            f" (o.n = c.n\n"
-            f"           OR o.n = c.n - {k}) GROUP BY c.n)")
-    parts += [
-        "pf AS{mat} (SELECT n, w FROM a20)",
-        "po AS{mat} (SELECT n, w FROM b19)",
-        "pdx AS{mat} (SELECT n, w FROM d20)",
-        # Euler's pentagonal recurrence at every n >= 1
-        "pv AS (SELECT CAST(sum(CASE WHEN t.s <> f.w THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS pent_viol FROM (\n"
-        "           SELECT c.n, sum(g.sg * o.w) AS s\n"
-        "           FROM n21 c JOIN gp g ON g.g <= c.n\n"
-        "           JOIN pf o ON o.n = c.n - g.g\n"
-        "           WHERE c.n >= 1 GROUP BY c.n) t\n"
-        "         JOIN pf f ON f.n = t.n)",
-        # Euler's odd = distinct identity at every n
-        "ev AS (SELECT CAST(sum(CASE WHEN o.w <> x.w THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS euler_viol\n"
-        "         FROM po o JOIN pdx x ON x.n = o.n)",
-        # Ramanujan congruences in range
-        "rm AS (SELECT\n"
-        "           CAST(sum(CASE WHEN n % 5 = 4 AND w % 5 <> 0\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " ram5_viol,\n"
-        "           CAST(sum(CASE WHEN n % 7 = 5 AND w % 7 <> 0\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " ram7_viol\n"
-        "         FROM pf)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT f.n, f.w AS p_n, o.w AS p_odd, x.w AS"
-        " p_distinct,\n"
-        "       v.pent_viol, e.euler_viol, r.ram5_viol,\n"
-        "       r.ram7_viol, l.n_docs\n"
-        "FROM pf f JOIN po o ON o.n = f.n\n"
-        "JOIN pdx x ON x.n = f.n\n"
-        "CROSS JOIN pv v CROSS JOIN ev e CROSS JOIN rm r\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q696_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q696_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q696_partition_pentagonal",
-       "WITH " + _q696_join("documents", "//", " MATERIALIZED"))
-def q696(spark, sf_dir):
-    """The partition function to n = 20 by three machines that
-    share nothing, with Euler's pentagonal recurrence and
-    Ramanujan's congruences landing as exact certificates
-    (Euler 1741; Ramanujan 1919 — p(n) is the combinatorial
-    object under generating-function theory, and its arithmetic
-    regularities mod 5 and 7 are among the most famous
-    surprises in number theory).  Machine one is the staged
-    coin DP over part sizes 1..20 (each stage one modular-gap
-    join, the Bellman shape that distributes); it yields p(n) =
-    1, 1, 2, 3, 5, 7, 11, ..., 627.  Machine two is Euler's
-    pentagonal-number recurrence p(n) = sum (-1)^(k-1)
-    [p(n - k(3k-1)/2) + p(n - k(3k+1)/2)] over the generalized
-    pentagonal dim {1, 2, 5, 7, 12, 15} — it must and does
-    reproduce machine one at EVERY n >= 1 (pent_viol == 0, the
-    pentagonal number theorem's combinatorial content).
-    Machine three runs two further DPs: partitions into ODD
-    parts and into DISTINCT parts (0/1-use OR-join stages),
-    which agree at every n (euler_viol == 0 — Euler's classic
-    bijection identity, both sequences 1, 1, 1, 2, 2, 3, 4,
-    ..., 64).  Ramanujan's congruences hold on every in-range
-    witness: p(5k+4) = 5, 30, 135, 490 all divisible by 5
-    (ram5_viol == 0) and p(7k+5) = 7, 77, 490 all divisible by
-    7 (ram7_viol == 0) — verified, with the docstring honest
-    that in-range verification is the finite shadow of the
-    general theorem (proved by Ramanujan, not by this sweep).
-    Scale: fifty 21-row DP stages, log-free and linear."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q696_documents")
-    parts, fin = _q696_sql("q696_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q696_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("n21", "gp", "a0", "b0", "d0"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q696_{nm}",
-                      max_rows=30)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q697: Faulhaber's formula + Bernoulli numbers — power sums
-# in closed form over denominator 210, exact at every n
-
-
-_Q697_BERN = ("(0, 210), (1, 105), (2, 35), (3, 0), (4, -7),"
-              " (5, 0), (6, 5)")
-_Q697_PC = ", ".join(
-    f"({m}, {j}, {__import__('math').comb(m, j)})"
-    for m in range(2, 8) for j in range(m + 1))
-
-
-def _q697_sql(tbl: str, d: str, mat: str):
-    npow = ("CASE t.e " + " ".join(
-        "WHEN {e} THEN {expr}".format(
-            e=e, expr="*".join(["t.n"] * e) if e else "1")
-        for e in range(8)) + " END")
-    parts = [
-        f"n60 AS (SELECT DISTINCT CAST(doc_id % 60 + 1 AS"
-        f" BIGINT) AS n FROM {tbl})",
-        "bn AS (SELECT CAST(j AS BIGINT) AS j, CAST(b AS"
-        " BIGINT) AS b\n"
-        "         FROM (VALUES {bern}) t(j, b))",
-        "pc AS (SELECT CAST(m AS BIGINT) AS m, CAST(j AS"
-        " BIGINT) AS j,\n"
-        "           CAST(c AS BIGINT) AS c FROM (VALUES {pc})"
-        " t(m, j, c))",
-        # direct power sums S_p(n), p = 1..6, by one grouped join
-        "ps AS{mat} (SELECT a.n,\n"
-        "           CAST(sum(i.n) AS BIGINT) AS s1,\n"
-        "           CAST(sum(i.n*i.n) AS BIGINT) AS s2,\n"
-        "           CAST(sum(i.n*i.n*i.n) AS BIGINT) AS s3,\n"
-        "           CAST(sum(i.n*i.n*i.n*i.n) AS BIGINT) AS"
-        " s4,\n"
-        "           CAST(sum(i.n*i.n*i.n*i.n*i.n) AS BIGINT)"
-        " AS s5,\n"
-        "           CAST(sum(i.n*i.n*i.n*i.n*i.n*i.n) AS"
-        " BIGINT) AS s6\n"
-        "         FROM n60 a JOIN n60 i ON i.n <= a.n"
-        " GROUP BY a.n)",
-        "sp AS{mat} (SELECT n, 1 AS p, s1 AS s FROM ps\n"
-        "         UNION ALL SELECT n, 2, s2 FROM ps\n"
-        "         UNION ALL SELECT n, 3, s3 FROM ps\n"
-        "         UNION ALL SELECT n, 4, s4 FROM ps\n"
-        "         UNION ALL SELECT n, 5, s5 FROM ps\n"
-        "         UNION ALL SELECT n, 6, s6 FROM ps)",
-        # Bernoulli defining recurrence (B+ convention):
-        # sum_j C(m+1, j) B_j = m + 1, over denominator 210
-        "bv AS (SELECT CAST(sum(CASE WHEN t.s <> (t.m)*210"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS bern_viol FROM (\n"
-        "           SELECT p.m, sum(p.c * b.b) AS s\n"
-        "           FROM pc p JOIN bn b ON b.j = p.j AND"
-        " p.j < p.m\n"
-        "           GROUP BY p.m) t)",
-        # Faulhaber at every (p, n): 210 (p+1) S_p(n) =
-        # sum_j C(p+1, j) B_j n^(p+1-j)
-        "fv AS (SELECT CAST(sum(CASE WHEN t.rhs <>\n"
-        "             210*(t.p + 1)*t.s THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "           AS faul_viol FROM (\n"
-        "           SELECT w.n, w.p, w.s, sum(p2.c * b.b *\n"
-        "             (" + npow.replace("t.e", "p2.m - p2.j")
-        .replace("t.n", "w.n") + ")) AS rhs\n"
-        "           FROM sp w\n"
-        "           JOIN pc p2 ON p2.m = w.p + 1 AND"
-        " p2.j <= w.p\n"
-        "           JOIN bn b ON b.j = p2.j\n"
-        "           GROUP BY w.n, w.p, w.s) t)",
-        # Nicomachus: S_3 = S_1^2 at every n
-        "nv AS (SELECT CAST(sum(CASE WHEN s3 <> s1*s1 THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS nico_viol"
-        " FROM ps)",
-        # von Staudt–Clausen: B_k + sum 1/p over (p-1)|k primes
-        # is 1 here — all three cases exact over 210
-        "vv AS (SELECT CAST(\n"
-        "           CASE WHEN b2.b + 105 + 70 <> 210 THEN 1"
-        " ELSE 0 END\n"
-        "           + CASE WHEN b4.b + 105 + 70 + 42 <> 210"
-        " THEN 1\n"
-        "             ELSE 0 END\n"
-        "           + CASE WHEN b6.b + 105 + 70 + 30 <> 210"
-        " THEN 1\n"
-        "             ELSE 0 END AS BIGINT) AS vsc_viol\n"
-        "         FROM (SELECT b FROM bn WHERE j = 2) b2\n"
-        "         CROSS JOIN (SELECT b FROM bn WHERE j = 4)"
-        " b4\n"
-        "         CROSS JOIN (SELECT b FROM bn WHERE j = 6)"
-        " b6)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT s.n, s.s1, s.s2, s.s3,\n"
-        "       b.bern_viol, f.faul_viol, v.nico_viol,\n"
-        "       w.vsc_viol, l.n_docs\n"
-        "FROM ps s CROSS JOIN bv b CROSS JOIN fv f\n"
-        "CROSS JOIN nv v CROSS JOIN vv w CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q697_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q697_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{bern}", _Q697_BERN)
-             .replace("{pc}", _Q697_PC))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q697_faulhaber_bernoulli",
-       "WITH " + _q697_join("documents", "//", " MATERIALIZED"))
-def q697(spark, sf_dir):
-    """Faulhaber's formula and the Bernoulli numbers, exact
-    over denominator 210 at every n up to 60 (Faulhaber 1631,
-    Jakob Bernoulli 1713 — the closed forms for power sums that
-    launched the Bernoulli numbers, which then show up in
-    Euler–Maclaurin, zeta values, and numerical analysis; no
-    float touches any of it here).  The Bernoulli numbers B0..
-    B6 (B+ convention, B1 = +1/2) are inlined as integers over
-    the common denominator 210 and re-certified by their
-    DEFINING recurrence sum_j C(m+1, j) B_j = m + 1 for every
-    m (bern_viol == 0, binomials from an inlined Pascal dim).
-    Direct power sums S_p(n) for p = 1..6 compute by one
-    grouped triangular join over the 60-value corpus dim; then
-    Faulhaber's closed form 210 (p+1) S_p(n) = sum_j C(p+1, j)
-    B_j n^(p+1-j) is verified as an exact BIGINT identity at
-    ALL 360 (p, n) pairs (faul_viol == 0) — the seven-term
-    polynomial in n, with its CASE-dispatched powers, matching
-    the brute sum term for term.  Nicomachus's theorem S_3 =
-    S_1^2 rides the same sums at every n (nico_viol == 0), and
-    von Staudt–Clausen lands exactly: B_k plus sum of 1/p over
-    primes with (p-1) | k equals 1 for k = 2, 4, 6 (vsc_viol
-    == 0 over 210 — the theorem that pins every Bernoulli
-    denominator).  Scale: one triangular join plus dim
-    algebra; certificate cost fixed."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q697_documents")
-    parts, fin = _q697_sql("q697_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q697_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{bern}", _Q697_BERN)
-              .replace("{pc}", _Q697_PC))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("n60", "bn", "pc", "ps", "sp"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q697_{nm}",
-                      max_rows=500)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q698: the Hex theorem at 4x4 — every 2-coloring has exactly
-# one crossing, by total 65536-board exhaustion (mask BFS)
-
-
-_Q698_HIST = '(0, 0, 1), (1, 0, 16), (2, 0, 120), (3, 0, 560), (4, 20, 1820), (5, 228, 4368), (6, 1158, 8008), (7, 3420, 11440), (8, 6435, 12870), (9, 8020, 11440), (10, 6850, 8008), (11, 4140, 4368), (12, 1800, 1820), (13, 560, 560), (14, 120, 120), (15, 16, 16), (16, 1, 1)'
-
-_Q698_NBR = {0: [1, 4], 1: [2, 0, 5, 4], 2: [3, 1, 6, 5],
-             3: [2, 7, 6], 4: [5, 8, 0, 1], 5: [6, 4, 9, 1, 2, 8],
-             6: [7, 5, 10, 2, 3, 9], 7: [6, 11, 3, 10],
-             8: [9, 12, 4, 5], 9: [10, 8, 13, 5, 6, 12],
-             10: [11, 9, 14, 6, 7, 13], 11: [10, 15, 7, 14],
-             12: [13, 8, 9], 13: [14, 12, 9, 10],
-             14: [15, 13, 10, 11], 15: [14, 11]}
-
-
-def _q698_bit(col: str, j: int) -> str:
-    return f"(({col} {{d}} {2 ** j}) % 2)"
-
-
-def _q698_stage(player: str) -> str:
-    terms = []
-    for j in range(16):
-        color = (_q698_bit("m", j) if player == "R"
-                 else f"(1 - {_q698_bit('m', j)})")
-        nbr = " + ".join(_q698_bit("rc", t)
-                         for t in _Q698_NBR[j])
-        terms.append(
-            f"{2 ** j}*(CASE WHEN {_q698_bit('rc', j)} = 1"
-            f" THEN 1 WHEN {color} = 1 AND ({nbr}) >= 1 THEN 1"
-            f" ELSE 0 END)")
-    return ("CAST(" + "\n           + ".join(terms)
-            + " AS BIGINT)")
-
-
-def _q698_seed(player: str) -> str:
-    if player == "R":
-        cells = [j for j in range(16) if j % 4 == 0]
-        return ("CAST(" + " + ".join(
-            f"{2 ** j}*{_q698_bit('m', j)}" for j in cells)
-            + " AS BIGINT)")
-    cells = [j for j in range(16) if j < 4]
-    return ("CAST(" + " + ".join(
-        f"{2 ** j}*(1 - {_q698_bit('m', j)})" for j in cells)
-        + " AS BIGINT)")
-
-
-def _q698_win(player: str, col: str) -> str:
-    cells = [j for j in range(16)
-             if (j % 4 == 3 if player == "R" else j >= 12)]
-    return ("CASE WHEN " + " + ".join(
-        _q698_bit(col, j) for j in cells)
-        + " >= 1 THEN 1 ELSE 0 END")
-
-
-def _q698_sql(tbl: str, d: str, mat: str):
-    pop = " + ".join(_q698_bit("w.m", j) for j in range(16))
-    parts = [
-        f"b256 AS (SELECT DISTINCT CAST(doc_id % 256 AS"
-        f" BIGINT) AS b FROM {tbl})",
-        "hx AS (SELECT CAST(k AS BIGINT) AS k, CAST(nr AS"
-        " BIGINT) AS nr,\n"
-        "           CAST(bi AS BIGINT) AS bi FROM (VALUES"
-        " {hist}) t(k, nr, bi))",
-        "mm AS{mat} (SELECT hi.b*256 + lo.b AS m\n"
-        "         FROM b256 hi CROSS JOIN b256 lo)",
-    ]
-    for player in ("R", "B"):
-        p = player.lower()
-        parts.append(f"{p}0 AS{{mat}} (SELECT m,"
-                     f" {_q698_seed(player)} AS rc FROM mm)")
-        for k in range(1, 17):
-            parts.append(
-                f"{p}{k} AS{{mat}} (SELECT m,\n"
-                f"           {_q698_stage(player)} AS rc\n"
-                f"         FROM {p}{k - 1})")
-    parts += [
-        # BFS fixpoints: the 16th expansion adds nothing — the
-        # certificate that 15 rounds reached every component
-        "fx AS (SELECT CAST((SELECT sum(CASE WHEN a.rc <> b.rc\n"
-        "             THEN 1 ELSE 0 END) FROM r16 a JOIN r15 b\n"
-        "             ON b.m = a.m)\n"
-        "           + (SELECT sum(CASE WHEN a.rc <> b.rc THEN 1\n"
-        "             ELSE 0 END) FROM b16 a JOIN b15 b\n"
-        "             ON b.m = a.m) AS BIGINT) AS fix_viol)",
-        "wn AS{mat} (SELECT r.m,\n"
-        "           " + _q698_win("R", "r.rc") + " AS wr,\n"
-        "           " + _q698_win("B", "b.rc") + " AS wb\n"
-        "         FROM r15 r JOIN b15 b ON b.m = r.m)",
-        # the Hex theorem: exactly one winner on EVERY board
-        "hv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN wr + wb <> 1 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS hex_viol,\n"
-        "           CAST(sum(wr) AS BIGINT) AS n_rwin,\n"
-        "           CAST(sum(wb) AS BIGINT) AS n_bwin\n"
-        "         FROM wn)",
-        # popcount histogram of R wins vs the pinned census and
-        # the complement-transpose symmetry nR(k) = nB(16-k)
-        "hg AS{mat} (SELECT " + pop + " AS k,\n"
-        "           CAST(count(*) AS BIGINT) AS nb,\n"
-        "           CAST(sum(w.wr) AS BIGINT) AS nrw\n"
-        "         FROM wn w GROUP BY " + pop + ")",
-        "hc AS (SELECT\n"
-        "           CAST(sum(CASE WHEN g.nb <> x.bi OR g.nrw <>"
-        " x.nr\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " hist_viol,\n"
-        "           CAST(sum(CASE WHEN g.nrw <> x2.bi - x2.nr\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " sym_viol\n"
-        "         FROM hg g JOIN hx x ON x.k = g.k\n"
-        "         JOIN hx x2 ON x2.k = 16 - g.k)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT g.k, g.nb, g.nrw,\n"
-        "       v.hex_viol, v.n_rwin, v.n_bwin, f.fix_viol,\n"
-        "       c.hist_viol, c.sym_viol, l.n_docs\n"
-        "FROM hg g CROSS JOIN hv v CROSS JOIN fx f\n"
-        "CROSS JOIN hc c CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q698_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q698_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{hist}", _Q698_HIST))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q698_hex_theorem",
-       "WITH " + _q698_join("documents", "//", " MATERIALIZED"))
-def q698(spark, sf_dir):
-    """The Hex theorem by total exhaustion at 4x4 — every one
-    of the 65536 two-colorings has EXACTLY one crossing (Nash
-    c. 1949 via Gale 1979, who proved it equivalent to
-    Brouwer's fixed-point theorem: 'Hex cannot end in a draw'
-    IS topology, and this query checks every single instance).
-    All 65536 boards materialize from two 256-value corpus
-    dims; connectivity runs as mask-BFS — per board, the
-    reached set is ONE bitmask column, each round a pure
-    column expression (cell reached if already reached, or
-    same-colored with a reached hex-neighbor), 15 unrolled
-    rounds per player with the 16th expansion certified a
-    FIXPOINT (fix_viol == 0 — the BFS provably saturated, so
-    'wins' is decided, not sampled).  Red crosses left-right
-    through red cells, Blue top-bottom through blue cells, and
-    on every board wr + wb == 1 (hex_viol == 0): never zero
-    (no draws — Gale's theorem, the discrete Brouwer) and
-    never two (no double crossing — planar duality of the hex
-    graph).  The split is exactly 32768/32768, and the
-    popcount census lands against the pinned table: R first
-    wins at 4 stones (20 boards — the 20 shortest crossings),
-    with the complement-transpose involution's symmetry
-    nR(k) = C(16,k) - nR(16-k) verified at every k (sym_viol
-    == 0) — the bijection counted, not invoked.  Scale: 34
-    materialized mask stages over a 65536-row table, all
-    whole-stage-codegen column math; no joins grow with the
-    corpus."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q698_documents")
-    # mask-BFS as a DataFrame loop: a repartition barrier per
-    # round stops CollapseProject from substituting the ~80
-    # reach references per stage into an exponential tree
-    # (the q121 stage-split lesson), with no driver roundtrips
-    mm = spark.sql(
-        "SELECT hi.b*256 + lo.b AS m FROM (SELECT DISTINCT"
-        " CAST(doc_id % 256 AS BIGINT) AS b FROM"
-        " q698_documents) hi CROSS JOIN (SELECT DISTINCT"
-        " CAST(doc_id % 256 AS BIGINT) AS b FROM"
-        " q698_documents) lo").repartition(4, "m")
-    sR = _q698_stage("R").replace("{d}", "div")
-    sB = _q698_stage("B").replace("{d}", "div").replace(
-        "rc", "rb")
-    df = mm.selectExpr(
-        "m",
-        _q698_seed("R").replace("{d}", "div") + " AS rc",
-        _q698_seed("B").replace("{d}", "div") + " AS rb")
-    prev = None
-    for k in range(1, 17):
-        df = df.selectExpr("m", sR + " AS rc", sB + " AS rb") \
-            .repartition(4, "m")
-        if k == 15:
-            prev = df
-    prev.createOrReplaceTempView("q698_s15")
-    df.createOrReplaceTempView("q698_s16")
-    parts, fin = _q698_sql("q698_documents", "div", "")
-    done = ["mm"]
-    spark.sql("SELECT m FROM q698_s15") \
-        .createOrReplaceTempView("q698_mm")
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q698_{nm}", text)
-        return text
-
-    # map the oracle's r15/r16/b15/b16 onto the loop's views
-    for nm, view, col in (("r15", "q698_s15", "rc"),
-                          ("r16", "q698_s16", "rc"),
-                          ("b15", "q698_s15", "rb"),
-                          ("b16", "q698_s16", "rb")):
-        spark.sql(f"SELECT m, {col} AS rc FROM {view}") \
-            .createOrReplaceTempView(f"q698_{nm}")
-        done.append(nm)
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{hist}", _Q698_HIST))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("b256", "mm") or \
-                (nm[0] in "rb" and nm[1:].isdigit()):
-            continue
-        if nm == "hx":
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q698_{nm}",
-                      max_rows=70000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q699: Dilworth and Mirsky on the divisibility poset of 1..20
-# — strong duality with witnesses, bijection made visible
-
-
-_Q699_COVER = '(1, 0), (2, 0), (3, 1), (4, 0), (5, 2), (6, 1), (7, 3), (8, 0), (9, 4), (10, 2), (11, 5), (12, 1), (13, 6), (14, 3), (15, 7), (16, 0), (17, 8), (18, 4), (19, 9), (20, 2)'
-
-
-def _q699_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"el AS (SELECT DISTINCT CAST(doc_id % 20 + 1 AS"
-        f" BIGINT) AS n FROM {tbl})",
-        "cv AS (SELECT CAST(n AS BIGINT) AS n, CAST(c AS"
-        " BIGINT) AS c\n"
-        "         FROM (VALUES {cover}) t(n, c))",
-        # strict divisibility relation a | b, a < b
-        "dv AS{mat} (SELECT a.n AS a, b.n AS b FROM el a\n"
-        "         JOIN el b ON b.n > a.n AND b.n % a.n = 0)",
-        # witness antichain {11..20}: pairwise incomparable
-        "av AS (SELECT CAST(count(*) AS BIGINT) AS anti_viol\n"
-        "         FROM dv WHERE a >= 11 AND b >= 11)",
-        # witness cover: a partition into 10 divisibility chains
-        "pv AS (SELECT CAST(\n"
-        "           (SELECT count(*) FROM el e LEFT JOIN cv c\n"
-        "             ON c.n = e.n WHERE c.n IS NULL)\n"
-        "           + (SELECT count(*) - count(DISTINCT n)"
-        " FROM cv)\n"
-        "           AS BIGINT) AS cover_viol)",
-        "cw AS (SELECT CAST(sum(CASE WHEN v.a IS NULL THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS chain_viol\n"
-        "         FROM cv x JOIN cv y ON y.c = x.c AND"
-        " y.n > x.n\n"
-        "         LEFT JOIN dv v ON v.a = x.n AND v.b = y.n)",
-        # duality: 10 == 10, and each chain holds EXACTLY ONE
-        # antichain element — the pigeonhole bijection visible
-        "dg AS (SELECT\n"
-        "           CAST((SELECT count(*) FROM el WHERE"
-        " n >= 11)\n"
-        "             - (SELECT count(DISTINCT c) FROM cv) AS"
-        " BIGINT)\n"
-        "             AS duality_gap,\n"
-        "           CAST((SELECT sum(CASE WHEN t.k <> 1 THEN 1\n"
-        "             ELSE 0 END) FROM (SELECT c,"
-        " sum(CASE WHEN\n"
-        "             n >= 11 THEN 1 ELSE 0 END) AS k FROM cv\n"
-        "             GROUP BY c) t) AS BIGINT) AS bij_viol)",
-        # Mirsky: heights by 5 fixpoint rounds of the divisor max
-        "h0 AS (SELECT n, CAST(1 AS BIGINT) AS h FROM el)",
-    ]
-    for k in range(1, 6):
-        parts.append(
-            f"h{k} AS{{mat}} (SELECT e.n,\n"
-            f"           CAST(1 + coalesce(max(p.h), 0) AS"
-            f" BIGINT) AS h\n"
-            f"         FROM el e LEFT JOIN (SELECT v.b, o.h"
-            f" FROM dv v\n"
-            f"           JOIN h{k - 1} o ON o.n = v.a) p ON"
-            f" p.b = e.n\n"
-            f"         GROUP BY e.n)")
-    parts += [
-        "fx AS (SELECT CAST(sum(CASE WHEN a.h <> b.h THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS fix_viol\n"
-        "         FROM h5 a JOIN h4 b ON b.n = a.n)",
-        # levels are antichains; #levels == longest chain == 5
-        "lv AS (SELECT CAST(sum(CASE WHEN ha.h = hb.h THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS level_viol\n"
-        "         FROM dv v JOIN h5 ha ON ha.n = v.a\n"
-        "         JOIN h5 hb ON hb.n = v.b)",
-        "mk AS (SELECT CAST(max(h) AS BIGINT) AS n_levels,\n"
-        "           CAST(count(DISTINCT h) AS BIGINT) AS"
-        " n_distinct_h\n"
-        "         FROM h5)",
-        # the witness chain 1|2|4|8|16 attains the height bound
-        "wc AS (SELECT CAST(count(*) + 1 AS BIGINT) AS"
-        " attain\n"
-        "         FROM dv WHERE a IN (1, 2, 4, 8) AND\n"
-        "           b IN (2, 4, 8, 16) AND b = 2*a)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT e.n, h.h AS height, c.c AS chain_id,\n"
-        "       CASE WHEN e.n >= 11 THEN 1 ELSE 0 END AS"
-        " in_antichain,\n"
-        "       a.anti_viol, p.cover_viol, w.chain_viol,\n"
-        "       g.duality_gap, g.bij_viol, f.fix_viol,\n"
-        "       v.level_viol, m.n_levels, x.attain AS"
-        " chain_attain,\n"
-        "       l.n_docs\n"
-        "FROM el e JOIN h5 h ON h.n = e.n\n"
-        "JOIN cv c ON c.n = e.n\n"
-        "CROSS JOIN av a CROSS JOIN pv p CROSS JOIN cw w\n"
-        "CROSS JOIN dg g CROSS JOIN fx f CROSS JOIN lv v\n"
-        "CROSS JOIN mk m CROSS JOIN wc x CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q699_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q699_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{cover}", _Q699_COVER))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q699_dilworth_mirsky",
-       "WITH " + _q699_join("documents", "//", " MATERIALIZED"))
-def q699(spark, sf_dir):
-    """Dilworth's and Mirsky's theorems on the divisibility
-    poset of 1..20, with strong duality landed by explicit
-    witnesses and the pigeonhole bijection made visible
-    (Dilworth 1950, Mirsky 1971; the chain/antichain dualities
-    under scheduling, VLSI channel routing, and patience
-    sorting — q609's LIS machinery is the permutation special
-    case).  The poset is a | b on a corpus dim.  Dilworth side:
-    the witness antichain {11..20} is certified pairwise
-    incomparable (anti_viol == 0 — no element of 11..20
-    divides another, the ratio-below-2 argument checked, not
-    trusted), the witness cover of TEN divisibility chains
-    ({1,2,4,8,16}, {3,6,12}, {5,10,20}, {7,14}, {9,18}, and
-    five singletons) is certified a partition (cover_viol ==
-    0) with every within-chain pair comparable (chain_viol ==
-    0), and strong duality lands as duality_gap == 0 (10 ==
-    10) with each cover chain containing EXACTLY ONE antichain
-    element (bij_viol == 0) — the weak-duality pigeonhole that
-    makes both witnesses optimal, visible as data.  Mirsky
-    side: heights compute by five fixpoint rounds of the
-    divisor-max DP (fix_viol == 0 certifies saturation), the
-    height levels are themselves antichains (level_viol == 0 —
-    comparable pairs always differ in height), n_levels == 5
-    equals the longest chain, attained by the witness
-    1|2|4|8|16 (chain_attain == 5... the dual pigeonhole).
-    Scale: divisor joins on a 20-row dim; certificate cost
-    corpus-independent."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q699_documents")
-    parts, fin = _q699_sql("q699_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q699_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{cover}", _Q699_COVER))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("el", "cv", "dv") or \
-                (nm[0] == "h" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q699_{nm}",
-                      max_rows=100)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q700: the chromatic polynomial over ALL graphs on 5 vertices
-# — deletion-contraction, Brooks' theorem, and coefficient
-# identities, by total 1024-graph x 3125-coloring exhaustion
-
-
-_Q700_CD = '(1, 0, 0), (2, 0, 0), (3, 2, 1), (4, 0, 0), (5, 4, 2), (6, 4, 2), (7, 6, 3), (8, 0, 0), (9, 8, 4), (10, 8, 4), (11, 10, 5), (12, 8, 4), (13, 12, 6), (14, 12, 6), (15, 14, 7), (16, 0, 0), (17, 16, 1), (18, 16, 1), (19, 18, 1), (20, 16, 8), (21, 20, 3), (22, 20, 3), (23, 22, 3), (24, 16, 8), (25, 24, 5), (26, 24, 5), (27, 26, 5), (28, 24, 12), (29, 28, 7), (30, 28, 7), (31, 30, 7), (32, 0, 0), (33, 32, 2), (34, 32, 8), (35, 34, 3), (36, 32, 1), (37, 36, 2), (38, 36, 10), (39, 38, 3), (40, 32, 16), (41, 40, 6), (42, 40, 12), (43, 42, 7), (44, 40, 5), (45, 44, 6), (46, 44, 14), (47, 46, 7), (48, 32, 8), (49, 48, 3), (50, 48, 9), (51, 50, 3), (52, 48, 9), (53, 52, 3), (54, 52, 11), (55, 54, 3), (56, 48, 24), (57, 56, 7), (58, 56, 13), (59, 58, 7), (60, 56, 13), (61, 60, 7), (62, 60, 15), (63, 62, 7), (64, 0, 0), (65, 64, 4), (66, 64, 16), (67, 66, 5), (68, 64, 16), (69, 68, 6), (70, 68, 18), (71, 70, 7), (72, 64, 1), (73, 72, 4), (74, 72, 20), (75, 74, 5), (76, 72, 20), (77, 76, 6), (78, 76, 22), (79, 78, 7), (80, 64, 16), (81, 80, 5), (82, 80, 17), (83, 82, 5), (84, 80, 24), (85, 84, 7), (86, 84, 19), (87, 86, 7), (88, 80, 9), (89, 88, 5), (90, 88, 21), (91, 90, 5), (92, 88, 28), (93, 92, 7), (94, 92, 23), (95, 94, 7), (96, 64, 16), (97, 96, 6), (98, 96, 24), (99, 98, 7), (100, 96, 17), (101, 100, 6), (102, 100, 26), (103, 102, 7), (104, 96, 17), (105, 104, 6), (106, 104, 28), (107, 106, 7), (108, 104, 21), (109, 108, 6), (110, 108, 30), (111, 110, 7), (112, 96, 24), (113, 112, 7), (114, 112, 25), (115, 114, 7), (116, 112, 25), (117, 116, 7), (118, 116, 27), (119, 118, 7), (120, 112, 25), (121, 120, 7), (122, 120, 29), (123, 122, 7), (124, 120, 29), (125, 124, 7), (126, 124, 31), (127, 126, 7), (128, 0, 0), (129, 128, 8), (130, 128, 2), (131, 130, 9), (132, 128, 2), (133, 132, 10), (134, 132, 2), (135, 134, 11), (136, 128, 32), (137, 136, 12), (138, 136, 6), (139, 138, 13), (140, 136, 6), (141, 140, 14), (142, 140, 6), (143, 142, 15), (144, 128, 8), (145, 144, 9), (146, 144, 3), (147, 146, 9), (148, 144, 10), (149, 148, 11), (150, 148, 3), (151, 150, 11), (152, 144, 40), (153, 152, 13), (154, 152, 7), (155, 154, 13), (156, 152, 14), (157, 156, 15), (158, 156, 7), (159, 158, 15), (160, 128, 8), (161, 160, 10), (162, 160, 10), (163, 162, 11), (164, 160, 3), (165, 164, 10), (166, 164, 10), (167, 166, 11), (168, 160, 48), (169, 168, 14), (170, 168, 14), (171, 170, 15), (172, 168, 7), (173, 172, 14), (174, 172, 14), (175, 174, 15), (176, 160, 8), (177, 176, 11), (178, 176, 11), (179, 178, 11), (180, 176, 11), (181, 180, 11), (182, 180, 11), (183, 182, 11), (184, 176, 56), (185, 184, 15), (186, 184, 15), (187, 186, 15), (188, 184, 15), (189, 188, 15), (190, 188, 15), (191, 190, 15), (192, 128, 32), (193, 192, 12), (194, 192, 18), (195, 194, 13), (196, 192, 18), (197, 196, 14), (198, 196, 18), (199, 198, 15), (200, 192, 33), (201, 200, 12), (202, 200, 22), (203, 202, 13), (204, 200, 22), (205, 204, 14), (206, 204, 22), (207, 206, 15), (208, 192, 24), (209, 208, 13), (210, 208, 19), (211, 210, 13), (212, 208, 26), (213, 212, 15), (214, 212, 19), (215, 214, 15), (216, 208, 41), (217, 216, 13), (218, 216, 23), (219, 218, 13), (220, 216, 30), (221, 220, 15), (222, 220, 23), (223, 222, 15), (224, 192, 24), (225, 224, 14), (226, 224, 26), (227, 226, 15), (228, 224, 19), (229, 228, 14), (230, 228, 26), (231, 230, 15), (232, 224, 49), (233, 232, 14), (234, 232, 30), (235, 234, 15), (236, 232, 23), (237, 236, 14), (238, 236, 30), (239, 238, 15), (240, 224, 24), (241, 240, 15), (242, 240, 27), (243, 242, 15), (244, 240, 27), (245, 244, 15), (246, 244, 27), (247, 246, 15), (248, 240, 57), (249, 248, 15), (250, 248, 31), (251, 250, 15), (252, 248, 31), (253, 252, 15), (254, 252, 31), (255, 254, 15), (256, 0, 0), (257, 256, 16), (258, 256, 4), (259, 258, 17), (260, 256, 32), (261, 260, 18), (262, 260, 6), (263, 262, 19), (264, 256, 2), (265, 264, 20), (266, 264, 4), (267, 266, 21), (268, 264, 36), (269, 268, 22), (270, 268, 6), (271, 270, 23), (272, 256, 16), (273, 272, 17), (274, 272, 5), (275, 274, 17), (276, 272, 40), (277, 276, 19), (278, 276, 7), (279, 278, 19), (280, 272, 10), (281, 280, 21), (282, 280, 5), (283, 282, 21), (284, 280, 44), (285, 284, 23), (286, 284, 7), (287, 286, 23), (288, 256, 32), (289, 288, 18), (290, 288, 12), (291, 290, 19), (292, 288, 33), (293, 292, 18), (294, 292, 14), (295, 294, 19), (296, 288, 18), (297, 296, 22), (298, 296, 12), (299, 298, 23), (300, 296, 37), (301, 300, 22), (302, 300, 14), (303, 302, 23), (304, 288, 24), (305, 304, 19), (306, 304, 13), (307, 306, 19), (308, 304, 41), (309, 308, 19), (310, 308, 15), (311, 310, 19), (312, 304, 26), (313, 312, 23), (314, 312, 13), (315, 314, 23), (316, 312, 45), (317, 316, 23), (318, 316, 15), (319, 318, 23), (320, 256, 8), (321, 320, 20), (322, 320, 20), (323, 322, 21), (324, 320, 48), (325, 324, 22), (326, 324, 22), (327, 326, 23), (328, 320, 3), (329, 328, 20), (330, 328, 20), (331, 330, 21), (332, 328, 52), (333, 332, 22), (334, 332, 22), (335, 334, 23), (336, 320, 16), (337, 336, 21), (338, 336, 21), (339, 338, 21), (340, 336, 56), (341, 340, 23), (342, 340, 23), (343, 342, 23), (344, 336, 11), (345, 344, 21), (346, 344, 21), (347, 346, 21), (348, 344, 60), (349, 348, 23), (350, 348, 23), (351, 350, 23), (352, 320, 48), (353, 352, 22), (354, 352, 28), (355, 354, 23), (356, 352, 49), (357, 356, 22), (358, 356, 30), (359, 358, 23), (360, 352, 19), (361, 360, 22), (362, 360, 28), (363, 362, 23), (364, 360, 53), (365, 364, 22), (366, 364, 30), (367, 366, 23), (368, 352, 24), (369, 368, 23), (370, 368, 29), (371, 370, 23), (372, 368, 57), (373, 372, 23), (374, 372, 31), (375, 374, 23), (376, 368, 27), (377, 376, 23), (378, 376, 29), (379, 378, 23), (380, 376, 61), (381, 380, 23), (382, 380, 31), (383, 382, 23), (384, 256, 32), (385, 384, 24), (386, 384, 6), (387, 386, 25), (388, 384, 34), (389, 388, 26), (390, 388, 6), (391, 390, 27), (392, 384, 34), (393, 392, 28), (394, 392, 6), (395, 394, 29), (396, 392, 38), (397, 396, 30), (398, 396, 6), (399, 398, 31), (400, 384, 24), (401, 400, 25), (402, 400, 7), (403, 402, 25), (404, 400, 42), (405, 404, 27), (406, 404, 7), (407, 406, 27), (408, 400, 42), (409, 408, 29), (410, 408, 7), (411, 410, 29), (412, 408, 46), (413, 412, 31), (414, 412, 7), (415, 414, 31), (416, 384, 40), (417, 416, 26), (418, 416, 14), (419, 418, 27), (420, 416, 35), (421, 420, 26), (422, 420, 14), (423, 422, 27), (424, 416, 50), (425, 424, 30), (426, 424, 14), (427, 426, 31), (428, 424, 39), (429, 428, 30), (430, 428, 14), (431, 430, 31), (432, 416, 24), (433, 432, 27), (434, 432, 15), (435, 434, 27), (436, 432, 43), (437, 436, 27), (438, 436, 15), (439, 438, 27), (440, 432, 58), (441, 440, 31), (442, 440, 15), (443, 442, 31), (444, 440, 47), (445, 444, 31), (446, 444, 15), (447, 446, 31), (448, 384, 40), (449, 448, 28), (450, 448, 22), (451, 450, 29), (452, 448, 50), (453, 452, 30), (454, 452, 22), (455, 454, 31), (456, 448, 35), (457, 456, 28), (458, 456, 22), (459, 458, 29), (460, 456, 54), (461, 460, 30), (462, 460, 22), (463, 462, 31), (464, 448, 24), (465, 464, 29), (466, 464, 23), (467, 466, 29), (468, 464, 58), (469, 468, 31), (470, 468, 23), (471, 470, 31), (472, 464, 43), (473, 472, 29), (474, 472, 23), (475, 474, 29), (476, 472, 62), (477, 476, 31), (478, 476, 23), (479, 478, 31), (480, 448, 56), (481, 480, 30), (482, 480, 30), (483, 482, 31), (484, 480, 51), (485, 484, 30), (486, 484, 30), (487, 486, 31), (488, 480, 51), (489, 488, 30), (490, 488, 30), (491, 490, 31), (492, 488, 55), (493, 492, 30), (494, 492, 30), (495, 494, 31), (496, 480, 24), (497, 496, 31), (498, 496, 31), (499, 498, 31), (500, 496, 59), (501, 500, 31), (502, 500, 31), (503, 502, 31), (504, 496, 59), (505, 504, 31), (506, 504, 31), (507, 506, 31), (508, 504, 63), (509, 508, 31), (510, 508, 31), (511, 510, 31), (512, 0, 0), (513, 512, 32), (514, 512, 32), (515, 514, 33), (516, 512, 4), (517, 516, 34), (518, 516, 34), (519, 518, 35), (520, 512, 4), (521, 520, 36), (522, 520, 36), (523, 522, 37), (524, 520, 4), (525, 524, 38), (526, 524, 38), (527, 526, 39), (528, 512, 32), (529, 528, 33), (530, 528, 33), (531, 530, 33), (532, 528, 12), (533, 532, 35), (534, 532, 35), (535, 534, 35), (536, 528, 12), (537, 536, 37), (538, 536, 37), (539, 538, 37), (540, 536, 12), (541, 540, 39), (542, 540, 39), (543, 542, 39), (544, 512, 16), (545, 544, 34), (546, 544, 40), (547, 546, 35), (548, 544, 5), (549, 548, 34), (550, 548, 42), (551, 550, 35), (552, 544, 20), (553, 552, 38), (554, 552, 44), (555, 554, 39), (556, 552, 5), (557, 556, 38), (558, 556, 46), (559, 558, 39), (560, 544, 40), (561, 560, 35), (562, 560, 41), (563, 562, 35), (564, 560, 13), (565, 564, 35), (566, 564, 43), (567, 566, 35), (568, 560, 28), (569, 568, 39), (570, 568, 45), (571, 570, 39), (572, 568, 13), (573, 572, 39), (574, 572, 47), (575, 574, 39), (576, 512, 16), (577, 576, 36), (578, 576, 48), (579, 578, 37), (580, 576, 20), (581, 580, 38), (582, 580, 50), (583, 582, 39), (584, 576, 5), (585, 584, 36), (586, 584, 52), (587, 586, 37), (588, 584, 20), (589, 588, 38), (590, 588, 54), (591, 590, 39), (592, 576, 48), (593, 592, 37), (594, 592, 49), (595, 594, 37), (596, 592, 28), (597, 596, 39), (598, 596, 51), (599, 598, 39), (600, 592, 13), (601, 600, 37), (602, 600, 53), (603, 602, 37), (604, 600, 28), (605, 604, 39), (606, 604, 55), (607, 606, 39), (608, 576, 16), (609, 608, 38), (610, 608, 56), (611, 610, 39), (612, 608, 21), (613, 612, 38), (614, 612, 58), (615, 614, 39), (616, 608, 21), (617, 616, 38), (618, 616, 60), (619, 618, 39), (620, 616, 21), (621, 620, 38), (622, 620, 62), (623, 622, 39), (624, 608, 56), (625, 624, 39), (626, 624, 57), (627, 626, 39), (628, 624, 29), (629, 628, 39), (630, 628, 59), (631, 630, 39), (632, 624, 29), (633, 632, 39), (634, 632, 61), (635, 634, 39), (636, 632, 29), (637, 636, 39), (638, 636, 63), (639, 638, 39), (640, 512, 32), (641, 640, 40), (642, 640, 34), (643, 642, 41), (644, 640, 6), (645, 644, 42), (646, 644, 34), (647, 646, 43), (648, 640, 36), (649, 648, 44), (650, 648, 38), (651, 650, 45), (652, 648, 6), (653, 652, 46), (654, 652, 38), (655, 654, 47), (656, 640, 40), (657, 656, 41), (658, 656, 35), (659, 658, 41), (660, 656, 14), (661, 660, 43), (662, 660, 35), (663, 662, 43), (664, 656, 44), (665, 664, 45), (666, 664, 39), (667, 666, 45), (668, 664, 14), (669, 668, 47), (670, 668, 39), (671, 670, 47), (672, 640, 24), (673, 672, 42), (674, 672, 42), (675, 674, 43), (676, 672, 7), (677, 676, 42), (678, 676, 42), (679, 678, 43), (680, 672, 52), (681, 680, 46), (682, 680, 46), (683, 682, 47), (684, 680, 7), (685, 684, 46), (686, 684, 46), (687, 686, 47), (688, 672, 40), (689, 688, 43), (690, 688, 43), (691, 690, 43), (692, 688, 15), (693, 692, 43), (694, 692, 43), (695, 694, 43), (696, 688, 60), (697, 696, 47), (698, 696, 47), (699, 698, 47), (700, 696, 15), (701, 700, 47), (702, 700, 47), (703, 702, 47), (704, 640, 48), (705, 704, 44), (706, 704, 50), (707, 706, 45), (708, 704, 22), (709, 708, 46), (710, 708, 50), (711, 710, 47), (712, 704, 37), (713, 712, 44), (714, 712, 54), (715, 714, 45), (716, 712, 22), (717, 716, 46), (718, 716, 54), (719, 718, 47), (720, 704, 56), (721, 720, 45), (722, 720, 51), (723, 722, 45), (724, 720, 30), (725, 724, 47), (726, 724, 51), (727, 726, 47), (728, 720, 45), (729, 728, 45), (730, 728, 55), (731, 730, 45), (732, 728, 30), (733, 732, 47), (734, 732, 55), (735, 734, 47), (736, 704, 24), (737, 736, 46), (738, 736, 58), (739, 738, 47), (740, 736, 23), (741, 740, 46), (742, 740, 58), (743, 742, 47), (744, 736, 53), (745, 744, 46), (746, 744, 62), (747, 746, 47), (748, 744, 23), (749, 748, 46), (750, 748, 62), (751, 750, 47), (752, 736, 56), (753, 752, 47), (754, 752, 59), (755, 754, 47), (756, 752, 31), (757, 756, 47), (758, 756, 59), (759, 758, 47), (760, 752, 61), (761, 760, 47), (762, 760, 63), (763, 762, 47), (764, 760, 31), (765, 764, 47), (766, 764, 63), (767, 766, 47), (768, 512, 32), (769, 768, 48), (770, 768, 36), (771, 770, 49), (772, 768, 36), (773, 772, 50), (774, 772, 38), (775, 774, 51), (776, 768, 6), (777, 776, 52), (778, 776, 36), (779, 778, 53), (780, 776, 36), (781, 780, 54), (782, 780, 38), (783, 782, 55), (784, 768, 48), (785, 784, 49), (786, 784, 37), (787, 786, 49), (788, 784, 44), (789, 788, 51), (790, 788, 39), (791, 790, 51), (792, 784, 14), (793, 792, 53), (794, 792, 37), (795, 794, 53), (796, 792, 44), (797, 796, 55), (798, 796, 39), (799, 798, 55), (800, 768, 48), (801, 800, 50), (802, 800, 44), (803, 802, 51), (804, 800, 37), (805, 804, 50), (806, 804, 46), (807, 806, 51), (808, 800, 22), (809, 808, 54), (810, 808, 44), (811, 810, 55), (812, 808, 37), (813, 812, 54), (814, 812, 46), (815, 814, 55), (816, 800, 56), (817, 816, 51), (818, 816, 45), (819, 818, 51), (820, 816, 45), (821, 820, 51), (822, 820, 47), (823, 822, 51), (824, 816, 30), (825, 824, 55), (826, 824, 45), (827, 826, 55), (828, 824, 45), (829, 828, 55), (830, 828, 47), (831, 830, 55), (832, 768, 24), (833, 832, 52), (834, 832, 52), (835, 834, 53), (836, 832, 52), (837, 836, 54), (838, 836, 54), (839, 838, 55), (840, 832, 7), (841, 840, 52), (842, 840, 52), (843, 842, 53), (844, 840, 52), (845, 844, 54), (846, 844, 54), (847, 846, 55), (848, 832, 48), (849, 848, 53), (850, 848, 53), (851, 850, 53), (852, 848, 60), (853, 852, 55), (854, 852, 55), (855, 854, 55), (856, 848, 15), (857, 856, 53), (858, 856, 53), (859, 858, 53), (860, 856, 60), (861, 860, 55), (862, 860, 55), (863, 862, 55), (864, 832, 48), (865, 864, 54), (866, 864, 60), (867, 866, 55), (868, 864, 53), (869, 868, 54), (870, 868, 62), (871, 870, 55), (872, 864, 23), (873, 872, 54), (874, 872, 60), (875, 874, 55), (876, 872, 53), (877, 876, 54), (878, 876, 62), (879, 878, 55), (880, 864, 56), (881, 880, 55), (882, 880, 61), (883, 882, 55), (884, 880, 61), (885, 884, 55), (886, 884, 63), (887, 886, 55), (888, 880, 31), (889, 888, 55), (890, 888, 61), (891, 890, 55), (892, 888, 61), (893, 892, 55), (894, 892, 63), (895, 894, 55), (896, 768, 32), (897, 896, 56), (898, 896, 38), (899, 898, 57), (900, 896, 38), (901, 900, 58), (902, 900, 38), (903, 902, 59), (904, 896, 38), (905, 904, 60), (906, 904, 38), (907, 906, 61), (908, 904, 38), (909, 908, 62), (910, 908, 38), (911, 910, 63), (912, 896, 56), (913, 912, 57), (914, 912, 39), (915, 914, 57), (916, 912, 46), (917, 916, 59), (918, 916, 39), (919, 918, 59), (920, 912, 46), (921, 920, 61), (922, 920, 39), (923, 922, 61), (924, 920, 46), (925, 924, 63), (926, 924, 39), (927, 926, 63), (928, 896, 56), (929, 928, 58), (930, 928, 46), (931, 930, 59), (932, 928, 39), (933, 932, 58), (934, 932, 46), (935, 934, 59), (936, 928, 54), (937, 936, 62), (938, 936, 46), (939, 938, 63), (940, 936, 39), (941, 940, 62), (942, 940, 46), (943, 942, 63), (944, 928, 56), (945, 944, 59), (946, 944, 47), (947, 946, 59), (948, 944, 47), (949, 948, 59), (950, 948, 47), (951, 950, 59), (952, 944, 62), (953, 952, 63), (954, 952, 47), (955, 954, 63), (956, 952, 47), (957, 956, 63), (958, 956, 47), (959, 958, 63), (960, 896, 56), (961, 960, 60), (962, 960, 54), (963, 962, 61), (964, 960, 54), (965, 964, 62), (966, 964, 54), (967, 966, 63), (968, 960, 39), (969, 968, 60), (970, 968, 54), (971, 970, 61), (972, 968, 54), (973, 972, 62), (974, 972, 54), (975, 974, 63), (976, 960, 56), (977, 976, 61), (978, 976, 55), (979, 978, 61), (980, 976, 62), (981, 980, 63), (982, 980, 55), (983, 982, 63), (984, 976, 47), (985, 984, 61), (986, 984, 55), (987, 986, 61), (988, 984, 62), (989, 988, 63), (990, 988, 55), (991, 990, 63), (992, 960, 56), (993, 992, 62), (994, 992, 62), (995, 994, 63), (996, 992, 55), (997, 996, 62), (998, 996, 62), (999, 998, 63), (1000, 992, 55), (1001, 1000, 62), (1002, 1000, 62), (1003, 1002, 63), (1004, 1000, 55), (1005, 1004, 62), (1006, 1004, 62), (1007, 1006, 63), (1008, 992, 56), (1009, 1008, 63), (1010, 1008, 63), (1011, 1010, 63), (1012, 1008, 63), (1013, 1012, 63), (1014, 1012, 63), (1015, 1014, 63), (1016, 1008, 63), (1017, 1016, 63), (1018, 1016, 63), (1019, 1018, 63), (1020, 1016, 63), (1021, 1020, 63), (1022, 1020, 63), (1023, 1022, 63)'
-_Q700_HX = '(1, 1), (2, 375), (3, 582), (4, 65), (5, 1)'
-_Q700_STAGE = "CAST(1*(CASE WHEN ((rc {d} 1) % 2) = 1 THEN 1 WHEN (((rc {d} 2) % 2)*((m {d} 1) % 2) + ((rc {d} 4) % 2)*((m {d} 2) % 2) + ((rc {d} 8) % 2)*((m {d} 4) % 2) + ((rc {d} 16) % 2)*((m {d} 8) % 2)) >= 1 THEN 1 ELSE 0 END) + 2*(CASE WHEN ((rc {d} 2) % 2) = 1 THEN 1 WHEN (((rc {d} 1) % 2)*((m {d} 1) % 2) + ((rc {d} 4) % 2)*((m {d} 16) % 2) + ((rc {d} 8) % 2)*((m {d} 32) % 2) + ((rc {d} 16) % 2)*((m {d} 64) % 2)) >= 1 THEN 1 ELSE 0 END) + 4*(CASE WHEN ((rc {d} 4) % 2) = 1 THEN 1 WHEN (((rc {d} 1) % 2)*((m {d} 2) % 2) + ((rc {d} 2) % 2)*((m {d} 16) % 2) + ((rc {d} 8) % 2)*((m {d} 128) % 2) + ((rc {d} 16) % 2)*((m {d} 256) % 2)) >= 1 THEN 1 ELSE 0 END) + 8*(CASE WHEN ((rc {d} 8) % 2) = 1 THEN 1 WHEN (((rc {d} 1) % 2)*((m {d} 4) % 2) + ((rc {d} 2) % 2)*((m {d} 32) % 2) + ((rc {d} 4) % 2)*((m {d} 128) % 2) + ((rc {d} 16) % 2)*((m {d} 512) % 2)) >= 1 THEN 1 ELSE 0 END) + 16*(CASE WHEN ((rc {d} 16) % 2) = 1 THEN 1 WHEN (((rc {d} 1) % 2)*((m {d} 8) % 2) + ((rc {d} 2) % 2)*((m {d} 64) % 2) + ((rc {d} 4) % 2)*((m {d} 256) % 2) + ((rc {d} 8) % 2)*((m {d} 512) % 2)) >= 1 THEN 1 ELSE 0 END) AS BIGINT)"
-_Q700_V5 = "((g.m {d} 1) % 2)*(CASE WHEN c.q0 = c.q1 THEN 1 ELSE 0 END) + ((g.m {d} 2) % 2)*(CASE WHEN c.q0 = c.q2 THEN 1 ELSE 0 END) + ((g.m {d} 4) % 2)*(CASE WHEN c.q0 = c.q3 THEN 1 ELSE 0 END) + ((g.m {d} 8) % 2)*(CASE WHEN c.q0 = c.q4 THEN 1 ELSE 0 END) + ((g.m {d} 16) % 2)*(CASE WHEN c.q1 = c.q2 THEN 1 ELSE 0 END) + ((g.m {d} 32) % 2)*(CASE WHEN c.q1 = c.q3 THEN 1 ELSE 0 END) + ((g.m {d} 64) % 2)*(CASE WHEN c.q1 = c.q4 THEN 1 ELSE 0 END) + ((g.m {d} 128) % 2)*(CASE WHEN c.q2 = c.q3 THEN 1 ELSE 0 END) + ((g.m {d} 256) % 2)*(CASE WHEN c.q2 = c.q4 THEN 1 ELSE 0 END) + ((g.m {d} 512) % 2)*(CASE WHEN c.q3 = c.q4 THEN 1 ELSE 0 END)"
-_Q700_V4 = "((g.m {d} 1) % 2)*(CASE WHEN c.q0 = c.q1 THEN 1 ELSE 0 END) + ((g.m {d} 2) % 2)*(CASE WHEN c.q0 = c.q2 THEN 1 ELSE 0 END) + ((g.m {d} 4) % 2)*(CASE WHEN c.q0 = c.q3 THEN 1 ELSE 0 END) + ((g.m {d} 8) % 2)*(CASE WHEN c.q1 = c.q2 THEN 1 ELSE 0 END) + ((g.m {d} 16) % 2)*(CASE WHEN c.q1 = c.q3 THEN 1 ELSE 0 END) + ((g.m {d} 32) % 2)*(CASE WHEN c.q2 = c.q3 THEN 1 ELSE 0 END)"
-_Q700_DEGS = ['((m {d} 1) % 2) + ((m {d} 2) % 2) + ((m {d} 4) % 2) + ((m {d} 8) % 2)', '((m {d} 1) % 2) + ((m {d} 16) % 2) + ((m {d} 32) % 2) + ((m {d} 64) % 2)', '((m {d} 2) % 2) + ((m {d} 16) % 2) + ((m {d} 128) % 2) + ((m {d} 256) % 2)', '((m {d} 4) % 2) + ((m {d} 32) % 2) + ((m {d} 128) % 2) + ((m {d} 512) % 2)', '((m {d} 8) % 2) + ((m {d} 64) % 2) + ((m {d} 256) % 2) + ((m {d} 512) % 2)']
-_Q700_POPC = "((g.m {d} 1) % 2) + ((g.m {d} 2) % 2) + ((g.m {d} 4) % 2) + ((g.m {d} 8) % 2) + ((g.m {d} 16) % 2) + ((g.m {d} 32) % 2) + ((g.m {d} 64) % 2) + ((g.m {d} 128) % 2) + ((g.m {d} 256) % 2) + ((g.m {d} 512) % 2)"
-
-
-def _q700_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"g32 AS (SELECT DISTINCT CAST(doc_id % 32 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"d5x AS (SELECT DISTINCT CAST(doc_id % 5 AS BIGINT)"
-        f" AS q FROM {tbl})",
-        f"kd AS (SELECT DISTINCT CAST(doc_id % 5 + 1 AS"
-        f" BIGINT) AS k FROM {tbl})",
-        "cdim AS (SELECT CAST(g AS BIGINT) AS g, CAST(gd AS"
-        " BIGINT) AS gd,"
-        " CAST(gc AS BIGINT) AS gc FROM (VALUES {cd})"
-        " t(g, gd, gc))",
-        "hx AS (SELECT CAST(c AS BIGINT) AS c, CAST(n AS"
-        " BIGINT) AS n FROM (VALUES {hx}) t(c, n))",
-        "gm AS{mat} (SELECT hi.b*32 + lo.b AS m"
-        " FROM g32 hi CROSS JOIN g32 lo)",
-        "g64 AS{mat} (SELECT DISTINCT gc AS m FROM cdim"
-        " UNION SELECT CAST(0 AS BIGINT))",
-        "cm5 AS{mat} (SELECT a.q AS q0, b.q AS q1, c.q AS q2,"
-        " e.q AS q3, f.q AS q4,"
-        " greatest(a.q, b.q, c.q, e.q, f.q) AS mx"
-        " FROM d5x a CROSS JOIN d5x b CROSS JOIN d5x c"
-        " CROSS JOIN d5x e CROSS JOIN d5x f)",
-        "cm4 AS{mat} (SELECT a.q AS q0, b.q AS q1, c.q AS q2,"
-        " e.q AS q3, greatest(a.q, b.q, c.q, e.q) AS mx"
-        " FROM d5x a CROSS JOIN d5x b CROSS JOIN d5x c"
-        " CROSS JOIN d5x e)",
-        "pc5 AS{mat} (SELECT g.m, c.mx, CAST(count(*) AS"
-        " BIGINT) AS w FROM gm g CROSS JOIN cm5 c"
-        " WHERE " + _Q700_V5 + " = 0 GROUP BY g.m, c.mx)",
-        "pc4 AS{mat} (SELECT g.m, c.mx, CAST(count(*) AS"
-        " BIGINT) AS w FROM g64 g CROSS JOIN cm4 c"
-        " WHERE " + _Q700_V4 + " = 0 GROUP BY g.m, c.mx)",
-        "pv5 AS{mat} (SELECT g.m, k.k, CAST(coalesce(sum(p.w),"
-        " 0) AS BIGINT) AS p FROM gm g CROSS JOIN kd k"
-        " LEFT JOIN pc5 p ON p.m = g.m AND p.mx <= k.k - 1"
-        " GROUP BY g.m, k.k)",
-        "pv4 AS{mat} (SELECT g.m, k.k, CAST(coalesce(sum(p.w),"
-        " 0) AS BIGINT) AS p FROM g64 g CROSS JOIN kd k"
-        " LEFT JOIN pc4 p ON p.m = g.m AND p.mx <= k.k - 1"
-        " GROUP BY g.m, k.k)",
-        "dcv AS (SELECT CAST(sum(CASE WHEN pg.p <> pd.p - pk.p"
-        " THEN 1 ELSE 0 END) AS BIGINT) AS delcon_viol"
-        " FROM cdim x JOIN pv5 pg ON pg.m = x.g"
-        " JOIN pv5 pd ON pd.m = x.gd AND pd.k = pg.k"
-        " JOIN pv4 pk ON pk.m = x.gc AND pk.k = pg.k)",
-        "ch AS{mat} (SELECT m, CAST(min(k) AS BIGINT) AS chi"
-        " FROM pv5 WHERE p > 0 GROUP BY m)",
-        "dg AS{mat} (SELECT m,"
-        + ", ".join(
-            " CAST(" + _Q700_DEGS[v] + " AS BIGINT) AS dg"
-            + str(v) for v in range(5))
-        + ", CAST(greatest("
-        + ", ".join(_Q700_DEGS[v] for v in range(5))
-        + ") AS BIGINT) AS mxd FROM gm)",
-        "r0 AS{mat} (SELECT m, CAST(1 AS BIGINT) AS rc"
-        " FROM gm)",
-    ]
-    for k in range(1, 6):
-        parts.append(
-            "r" + str(k) + " AS{mat} (SELECT m, " + _Q700_STAGE
-            + " AS rc FROM r" + str(k - 1) + ")")
-    parts += [
-        "cn AS{mat} (SELECT r.m, CASE WHEN r.rc = 31 THEN 1"
-        " ELSE 0 END AS conn FROM r5 r)",
-        "fxv AS (SELECT CAST(sum(CASE WHEN a.rc <> b.rc THEN 1"
-        " ELSE 0 END) AS BIGINT) AS fix_viol"
-        " FROM r5 a JOIN r4 b ON b.m = a.m)",
-        "bk AS (SELECT"
-        " CAST(sum(CASE WHEN n.conn = 1 AND g.m <> 1023"
-        " AND NOT (d2.dg0 = 2 AND d2.dg1 = 2 AND d2.dg2 = 2"
-        " AND d2.dg3 = 2 AND d2.dg4 = 2)"
-        " AND c.chi > d2.mxd THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS brooks_viol,"
-        " CAST(sum(n.conn) AS BIGINT) AS n_connected,"
-        " CAST(sum(CASE WHEN n.conn = 1 AND d2.dg0 = 2"
-        " AND d2.dg1 = 2 AND d2.dg2 = 2 AND d2.dg3 = 2"
-        " AND d2.dg4 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_c5"
-        " FROM gm g JOIN cn n ON n.m = g.m"
-        " JOIN ch c ON c.m = g.m JOIN dg d2 ON d2.m = g.m)",
-        "fd AS (SELECT CAST(sum(CASE WHEN t.d5v <> 120 THEN 1"
-        " ELSE 0 END) AS BIGINT) AS lead_viol,"
-        " CAST(sum(CASE WHEN t.d4v <> 240 - 24*t.ec"
-        " THEN 1 ELSE 0 END) AS BIGINT) AS coef_viol"
-        " FROM (SELECT g.m,"
-        " sum(CASE p.k WHEN 1 THEN 5*p.p WHEN 2 THEN -10*p.p"
-        " WHEN 3 THEN 10*p.p WHEN 4 THEN -5*p.p ELSE p.p END)"
-        " AS d5v,"
-        " sum(CASE p.k WHEN 1 THEN -4*p.p WHEN 2 THEN 6*p.p"
-        " WHEN 3 THEN -4*p.p WHEN 4 THEN 1*p.p ELSE 0 END)"
-        " AS d4v, " + _Q700_POPC + " AS ec"
-        " FROM gm g JOIN pv5 p ON p.m = g.m"
-        " GROUP BY g.m) t)",
-        "hh AS (SELECT c.chi, CAST(count(*) AS BIGINT) AS n"
-        " FROM ch c GROUP BY c.chi)",
-        "hv AS (SELECT CAST(sum(CASE WHEN h.n <> x.n THEN 1"
-        " ELSE 0 END) AS BIGINT) AS hist_viol"
-        " FROM hh h JOIN hx x ON x.c = h.chi)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT h.chi, h.n, x.n AS expected_n,"
-        " v.delcon_viol, b.brooks_viol, b.n_connected,"
-        " b.n_c5, f.lead_viol, f.coef_viol, w.fix_viol,"
-        " e.hist_viol, l.n_docs"
-        " FROM hh h JOIN hx x ON x.c = h.chi"
-        " CROSS JOIN dcv v CROSS JOIN bk b CROSS JOIN fd f"
-        " CROSS JOIN fxv w CROSS JOIN hv e CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q700_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q700_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{cd}", _Q700_CD).replace("{hx}",
-                                                _Q700_HX))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q700_chromatic_brooks",
-       "WITH " + _q700_join("documents", "//", " MATERIALIZED"))
-def q700(spark, sf_dir):
-    """The chromatic polynomial over EVERY graph on five
-    vertices — deletion-contraction, Brooks' theorem, and the
-    coefficient identities, all by total exhaustion (Birkhoff
-    1912 for P(G,k), Brooks 1941; graph coloring is register
-    allocation and scheduling in disguise, and this query
-    checks the whole 5-vertex universe rather than examples).
-    All 1024 graphs (10-bit edge masks) and all 3125 colorings
-    (base-5 digit tuples) cross; P(G,k) falls out of ONE
-    grouped census by maximum color used, for every G and k
-    simultaneously — the same machinery again on the 4-vertex
-    universe for contractions.  Certificates: (1)
-    deletion-contraction P(G,k) = P(G-e,k) - P(G/e,k) holds at
-    the lowest edge of every nonempty graph at every k
-    (delcon_viol == 0 over 5115 identities, contraction masks
-    Python-precomputed, polynomial values all exhaustive
-    counts); (2) Brooks' theorem — over all 728 connected
-    graphs (count certified, connectivity by fixpoint-certified
-    mask BFS), chi <= maxdeg except exactly the stated
-    exceptions, K5 and the 12 five-cycles (brooks_viol == 0,
-    n_c5 == 12); (3) the polynomial's shape — fifth finite
-    difference 120 = 5! (monic, degree exactly 5) and fourth
-    difference 240 - 24m (the second coefficient is MINUS THE
-    EDGE COUNT), exact at every graph; (4) the chromatic-number
-    census lands on the pinned 1/375/582/65/1.  Scale: one
-    3.2M-row census join feeds everything; all certificates
-    are grouped joins over 1024-row tables."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q700_documents")
-    parts, fin = _q700_sql("q700_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q700_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{cd}", _Q700_CD).replace("{hx}",
-                                                 _Q700_HX))
-        nm = fr.split(" AS ", 1)[0].strip()
-        pinnable = (nm in ("g32", "d5x", "kd", "cdim", "hx",
-                           "gm", "g64", "cm5", "cm4", "pc5",
-                           "pc4", "pv5", "pv4", "ch", "dg",
-                           "cn")
-                    or (nm[0] == "r" and nm[1:].isdigit()))
-        if pinnable:
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q700_{nm}",
-                      max_rows=6000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q701: the BEST theorem — Eulerian circuits counted by trail
-# DP vs arborescences x factorials, with root invariance
-
-
-_Q701_ED = '(0, 0, 1), (1, 0, 2), (2, 0, 3), (3, 1, 0), (4, 2, 0), (5, 3, 0), (6, 1, 2), (7, 2, 1)'
-
-
-def _q701_parent(col: str) -> str:
-    return (f"CASE {col} WHEN 0 THEN p0 WHEN 1 THEN p1"
-            f" WHEN 2 THEN p2 ELSE p3 END")
-
-
-def _q701_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "ed AS (SELECT CAST(e AS BIGINT) AS e, CAST(a AS"
-        " BIGINT) AS a,\n"
-        "           CAST(b AS BIGINT) AS b FROM (VALUES {ed})"
-        " t(e, a, b))",
-        # Eulerian degree condition: in-degree == out-degree
-        "ev AS (SELECT CAST(sum(CASE WHEN o.n <> i.n THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS eul_viol\n"
-        "         FROM (SELECT a AS v, count(*) AS n FROM ed"
-        " GROUP BY a) o\n"
-        "         JOIN (SELECT b AS v, count(*) AS n FROM ed"
-        " GROUP BY b) i\n"
-        "           ON i.v = o.v)",
-        # trail DP: start with edge 0 fixed (kills rotation
-        # overcount), extend by unused out-edges, ways summed
-        "t1 AS (SELECT CAST(1 AS BIGINT) AS mask, CAST(1 AS"
-        " BIGINT) AS cur,\n"
-        "           CAST(1 AS BIGINT) AS w)",
-    ]
-    for k in range(2, 9):
-        parts.append(
-            f"t{k} AS{{mat}} (SELECT t.mask + "
-            f"CASE g.e WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2"
-            f" THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5"
-            f" THEN 32 WHEN 6 THEN 64 ELSE 128 END"
-            f" AS mask,\n"
-            f"           g.b AS cur, CAST(sum(t.w) AS BIGINT)"
-            f" AS w\n"
-            f"         FROM t{k - 1} t JOIN ed g ON"
-            f" g.a = t.cur\n"
-            f"           AND (t.mask {{d}} CASE g.e WHEN 0"
-            f" THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3"
-            f" THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6"
-            f" THEN 64 ELSE 128 END) % 2 = 0\n"
-            f"         GROUP BY t.mask + CASE g.e WHEN 0 THEN"
-            f" 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8"
-            f" WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64"
-            f" ELSE 128 END, g.b)")
-    parts += [
-        "ec AS (SELECT CAST(coalesce(sum(w), 0) AS BIGINT)"
-        " AS n_circuits\n"
-        "         FROM t8 WHERE mask = 255 AND cur = 0)",
-        # all 24 out-edge choice functions, with parent pointers
-        "fm AS{mat} (SELECT c0.e AS f0, c1.e AS f1, c2.e AS"
-        " f2,\n"
-        "           c3.e AS f3, e0.b AS p0, e1.b AS p1,\n"
-        "           e2.b AS p2, e3.b AS p3\n"
-        "         FROM ed c0 JOIN ed e0 ON e0.e = c0.e AND"
-        " c0.a = 0\n"
-        "         JOIN ed c1 ON c1.a = 1 JOIN ed e1 ON"
-        " e1.e = c1.e\n"
-        "         JOIN ed c2 ON c2.a = 2 JOIN ed e2 ON"
-        " e2.e = c2.e\n"
-        "         JOIN ed c3 ON c3.a = 3 JOIN ed e3 ON"
-        " e3.e = c3.e)",
-        # arborescences toward each root: every non-root vertex
-        # reaches the root within three parent hops
-        "tw AS{mat} (" + "\n         UNION ALL ".join(
-            "SELECT CAST({r} AS BIGINT) AS root,"
-            " CAST(count(*) AS BIGINT) AS n FROM (SELECT"
-            " DISTINCT {packs} FROM fm WHERE {conds}) t"
-            .format(
-                r=r,
-                packs=", ".join(f"f{v}" for v in range(4)
-                                if v != r),
-                conds=" AND ".join(
-                    "(p{v} = {r} OR ({pp}) = {r} OR ({ppp})"
-                    " = {r})".format(
-                        v=v, r=r,
-                        pp=_q701_parent(f"p{v}"),
-                        ppp=_q701_parent(
-                            "(" + _q701_parent(f"p{v}") + ")"))
-                    for v in range(4) if v != r))
-            for r in range(4)) + ")",
-        "iv AS (SELECT CAST(max(n) - min(n) AS BIGINT) AS"
-        " inv_viol,\n"
-        "           CAST(max(n) AS BIGINT) AS n_arb FROM tw)",
-        # BEST: ec = tw(root) * prod (outdeg - 1)!
-        "bv AS (SELECT CAST(CASE WHEN c.n_circuits <> a.n_arb"
-        " * f.pf\n"
-        "           THEN 1 ELSE 0 END AS BIGINT) AS best_viol,\n"
-        "           f.pf AS fact_prod\n"
-        "         FROM ec c CROSS JOIN iv a CROSS JOIN (\n"
-        "           SELECT CAST(exp(sum(ln(CASE o.n WHEN 1"
-        " THEN 1\n"
-        "             WHEN 2 THEN 1 WHEN 3 THEN 2 ELSE 6"
-        " END))) + 0.5 AS BIGINT) AS pf\n"
-        "           FROM (SELECT a, count(*) AS n FROM ed"
-        " GROUP BY a) o) f)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT g.e, g.a, g.b, c.n_circuits, a.n_arb,\n"
-        "       b.fact_prod, b.best_viol, a.inv_viol,\n"
-        "       v.eul_viol, l.n_docs\n"
-        "FROM ed g CROSS JOIN ec c CROSS JOIN iv a\n"
-        "CROSS JOIN bv b CROSS JOIN ev v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q701_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q701_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{ed}", _Q701_ED))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q701_best_theorem",
-       "WITH " + _q701_join("documents", "//", " MATERIALIZED"))
-def q701(spark, sf_dir):
-    """The BEST theorem — Eulerian circuits counted by two
-    machines that share nothing: exhaustive trail DP vs
-    arborescence count times degree factorials (de Bruijn, van
-    Aardenne-Ehrenfest, Smith, Tutte 1951; the closed form
-    behind q601's de Bruijn sequence count 2^(2^(n-1)-n), here
-    verified on an Eulerian digraph where both sides are
-    computed, not cited).  The 8-edge digraph (hub 0 with
-    out-degree 3, a 1<->2 chord) is certified Eulerian
-    (in-degree == out-degree at every vertex, eul_viol == 0).
-    Machine one runs the trail DP over (used-edge mask,
-    current vertex) states with the FIRST edge pinned — each
-    circuit passes edge 0 exactly once, so fixing it kills the
-    rotation overcount — seven relational extension stages,
-    ways summed: n_circuits == 6.  Machine two enumerates all
-    24 out-edge choice functions with parent pointers as
-    columns; an arborescence toward root r is a choice where
-    every non-root vertex reaches r within three CASE-
-    dispatched parent hops — n_arb == 3 toward EVERY root
-    (inv_viol == 0: the count's root-independence, the BEST
-    theorem's hidden lemma, verified by computing all four).
-    The weld: ec = tw * prod(outdeg - 1)! = 3 * 2 = 6
-    (best_viol == 0) — the factorial term genuinely nontrivial
-    through the hub's (3-1)! = 2.  Scale: a 1024-state DP and
-    a 24-row sweep; dims only."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q701_documents")
-    parts, fin = _q701_sql("q701_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q701_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{ed}", _Q701_ED))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("ed", "fm", "tw") or \
-                (nm[0] == "t" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q701_{nm}",
-                      max_rows=2000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q702: the subgroup lattice of D4 — all 256 subsets sifted,
-# normality, the center, conjugacy orbits, and D4/Z = Klein
-
-
-_Q702_TB = '(0, 0, 0), (0, 1, 1), (0, 2, 2), (0, 3, 3), (0, 4, 4), (0, 5, 5), (0, 6, 6), (0, 7, 7), (1, 0, 1), (1, 1, 2), (1, 2, 3), (1, 3, 0), (1, 4, 5), (1, 5, 6), (1, 6, 7), (1, 7, 4), (2, 0, 2), (2, 1, 3), (2, 2, 0), (2, 3, 1), (2, 4, 6), (2, 5, 7), (2, 6, 4), (2, 7, 5), (3, 0, 3), (3, 1, 0), (3, 2, 1), (3, 3, 2), (3, 4, 7), (3, 5, 4), (3, 6, 5), (3, 7, 6), (4, 0, 4), (4, 1, 7), (4, 2, 6), (4, 3, 5), (4, 4, 0), (4, 5, 3), (4, 6, 2), (4, 7, 1), (5, 0, 5), (5, 1, 4), (5, 2, 7), (5, 3, 6), (5, 4, 1), (5, 5, 0), (5, 6, 3), (5, 7, 2), (6, 0, 6), (6, 1, 5), (6, 2, 4), (6, 3, 7), (6, 4, 2), (6, 5, 1), (6, 6, 0), (6, 7, 3), (7, 0, 7), (7, 1, 6), (7, 2, 5), (7, 3, 4), (7, 4, 3), (7, 5, 2), (7, 6, 1), (7, 7, 0)'
-_Q702_P2 = "CASE {c} WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 ELSE 128 END"
-
-
-def _q702_sql(tbl: str, d: str, mat: str):
-    b_of = lambda m, e: f"(({m} {{d}} {_Q702_P2.format(c=e)})" \
-        f" % 2)"
-    parts = [
-        f"h16 AS (SELECT DISTINCT CAST(doc_id % 16 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"e8 AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS e FROM {tbl})",
-        "tb AS (SELECT CAST(a AS BIGINT) AS a, CAST(b AS"
-        " BIGINT) AS b,\n"
-        "           CAST(m AS BIGINT) AS m FROM (VALUES {tb})"
-        " t(a, b, m))",
-        "ivt AS (SELECT a, b AS ai FROM tb WHERE m = 0)",
-        "mk AS{mat} (SELECT hi.b*16 + lo.b AS s\n"
-        "         FROM h16 hi CROSS JOIN h16 lo)",
-        # subgroups: identity in, closed under the table
-        "sg AS{mat} (SELECT t.s FROM (\n"
-        "           SELECT k.s, sum(CASE WHEN\n"
-        "             " + b_of("k.s", "t2.a") + " = 1 AND\n"
-        "             " + b_of("k.s", "t2.b") + " = 1 AND\n"
-        "             " + b_of("k.s", "t2.m") + " = 0\n"
-        "             THEN 1 ELSE 0 END) AS viol\n"
-        "           FROM mk k CROSS JOIN tb t2\n"
-        "           GROUP BY k.s) t\n"
-        "         WHERE t.viol = 0 AND t.s % 2 = 1)",
-        "ns AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " n_subgroups FROM sg)",
-        # orders + Lagrange
-        "od AS{mat} (SELECT g.s, CAST(sum(" + b_of("g.s", "x.e")
-        + ")\n"
-        "           AS BIGINT) AS ord FROM sg g CROSS JOIN e8"
-        " x\n"
-        "         GROUP BY g.s)",
-        "lg AS (SELECT CAST(sum(CASE WHEN 8 % ord <> 0 THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS lagrange_viol"
-        " FROM od)",
-        # conjugate masks g H g^-1 for every subgroup and g
-        "cj AS{mat} (SELECT g.s, x.e AS g2,\n"
-        "           CAST(sum((" + _Q702_P2.format(c="t3.m")
-        + ")\n"
-        "             * " + b_of("g.s", "a.e") + ") AS BIGINT)"
-        " AS cm\n"
-        "         FROM sg g CROSS JOIN e8 x CROSS JOIN e8 a\n"
-        "         JOIN tb t2 ON t2.a = x.e AND t2.b = a.e\n"
-        "         JOIN ivt v ON v.a = x.e\n"
-        "         JOIN tb t3 ON t3.a = t2.m AND t3.b = v.ai\n"
-        "         GROUP BY g.s, x.e)",
-        "nr AS{mat} (SELECT c.s, CASE WHEN sum(CASE WHEN"
-        " c.cm <> c.s\n"
-        "           THEN 1 ELSE 0 END) = 0 THEN 1 ELSE 0 END"
-        " AS nrm\n"
-        "         FROM cj c GROUP BY c.s)",
-        "nn AS (SELECT CAST(sum(nrm) AS BIGINT) AS n_normal"
-        " FROM nr)",
-        # index 2 => normal, checked on the order-4 subgroups
-        "i2 AS (SELECT CAST(sum(CASE WHEN o.ord = 4 AND"
-        " n.nrm = 0\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " index2_viol\n"
-        "         FROM od o JOIN nr n ON n.s = o.s)",
-        # the center, computed element-wise, must be mask 5 and
-        # a normal subgroup of order 2
-        "cz AS (SELECT CAST(sum(CASE WHEN t.bad = 0 THEN\n"
-        "           " + _Q702_P2.format(c="t.e") + " ELSE 0"
-        " END) AS BIGINT) AS zmask\n"
-        "         FROM (SELECT a.e, sum(CASE WHEN t1.m <> t2.m\n"
-        "             THEN 1 ELSE 0 END) AS bad\n"
-        "           FROM e8 a CROSS JOIN e8 g2\n"
-        "           JOIN tb t1 ON t1.a = a.e AND t1.b = g2.e\n"
-        "           JOIN tb t2 ON t2.a = g2.e AND t2.b = a.e\n"
-        "           GROUP BY a.e) t)",
-        "czv AS (SELECT CAST(CASE WHEN z.zmask <> 5 THEN 1"
-        " ELSE 0 END\n"
-        "           + CASE WHEN s2.s IS NULL THEN 1 ELSE 0 END\n"
-        "           + CASE WHEN n2.nrm <> 1 THEN 1 ELSE 0 END\n"
-        "           AS BIGINT) AS center_viol\n"
-        "         FROM cz z LEFT JOIN sg s2 ON s2.s = z.zmask\n"
-        "         LEFT JOIN nr n2 ON n2.s = z.zmask)",
-        # conjugacy orbits of subgroups: canonical min image
-        "ob AS (SELECT CAST(count(DISTINCT t.cmin) AS BIGINT)\n"
-        "           AS n_orbits FROM (SELECT s, min(cm) AS"
-        " cmin\n"
-        "           FROM cj GROUP BY s) t)",
-        # quotient by the center: cosets, well-definedness, and
-        # exponent 2 (D4/Z is the Klein four-group)
-        "cs AS{mat} (SELECT x.e AS g2, CAST(sum(DISTINCT\n"
-        "           " + _Q702_P2.format(c="t2.m") + ") AS"
-        " BIGINT) AS cm\n"
-        "         FROM e8 x JOIN tb t2 ON t2.a = x.e AND\n"
-        "           t2.b IN (0, 2)\n"
-        "         GROUP BY x.e)",
-        "ncs AS (SELECT CAST(count(DISTINCT cm) AS BIGINT) AS"
-        " n_cosets\n"
-        "         FROM cs)",
-        "wd AS (SELECT\n"
-        "           CAST(sum(CASE WHEN t.np <> 1 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS well_viol,\n"
-        "           CAST(sum(CASE WHEN t.ca = t.cb AND"
-        " t.pc <> 5\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " klein_viol\n"
-        "         FROM (SELECT ca.cm AS ca, cb.cm AS cb,\n"
-        "             count(DISTINCT cp.cm) AS np,\n"
-        "             min(cp.cm) AS pc\n"
-        "           FROM cs ca JOIN cs cb ON 1 = 1\n"
-        "           JOIN tb t2 ON t2.a = ca.g2 AND"
-        " t2.b = cb.g2\n"
-        "           JOIN cs cp ON cp.g2 = t2.m\n"
-        "           GROUP BY ca.cm, cb.cm) t)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT o.s, o.ord, n2.nrm AS is_normal,\n"
-        "       n.n_subgroups, g.lagrange_viol, m.n_normal,\n"
-        "       i.index2_viol, z.center_viol, b.n_orbits,\n"
-        "       c.n_cosets, w.well_viol, w.klein_viol,"
-        " l.n_docs\n"
-        "FROM od o JOIN nr n2 ON n2.s = o.s\n"
-        "CROSS JOIN ns n CROSS JOIN lg g CROSS JOIN nn m\n"
-        "CROSS JOIN i2 i CROSS JOIN czv z CROSS JOIN ob b\n"
-        "CROSS JOIN ncs c CROSS JOIN wd w CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q702_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q702_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{tb}", _Q702_TB))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q702_d4_subgroup_lattice",
-       "WITH " + _q702_join("documents", "//", " MATERIALIZED"))
-def q702(spark, sf_dir):
-    """The complete subgroup lattice of D4, sifted from all 256
-    subsets, with normality, the center, conjugacy orbits, and
-    the quotient's isomorphism type all computed (Lagrange
-    1771, Galois 1832 for normality; D4 — q681's square-
-    symmetry group — is the smallest group whose subgroup
-    structure shows everything at once, which is why it's every
-    textbook's example).  Every subset of the 8 elements is
-    tested for identity membership and closure under the
-    inlined multiplication table: exactly n_subgroups == 10
-    survive, with orders 1, 2x5, 4x3, 8 — every order dividing
-    8 (lagrange_viol == 0).  Conjugation g H g^-1 computes
-    relationally for all 80 (subgroup, g) pairs: n_normal == 6
-    (trivial, center, the three order-4s, D4), every index-2
-    subgroup is normal (index2_viol == 0 — the classic
-    theorem, verified on all three), and the conjugation
-    action's orbit census gives n_orbits == 8 subgroup
-    conjugacy classes (the two reflection pairs fuse, all else
-    is self-conjugate).  The center computes element-wise
-    (commutes with all) to exactly {1, r^2} = mask 5, itself a
-    normal subgroup (center_viol == 0).  The quotient D4/Z is
-    then CONSTRUCTED: the four cosets partition (n_cosets ==
-    4), coset multiplication is well-defined — every product
-    set lands inside ONE coset (well_viol == 0, the normality
-    of Z doing the work) — and every coset squares to the
-    identity coset (klein_viol == 0): D4/Z is the Klein
-    four-group, the canonical example of a non-cyclic
-    quotient of a group with cyclic-looking structure.  Scale:
-    a 16k-row closure sift plus dim joins — fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q702_documents")
-    parts, fin = _q702_sql("q702_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q702_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{tb}", _Q702_TB))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("h16", "e8", "tb", "ivt", "mk", "sg", "od",
-                  "cj", "nr", "cs"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q702_{nm}",
-                      max_rows=70000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q703: Wieferich search + Wolstenholme's theorem — modular
-# exponentiation sweeps with Hensel-lifted inverses, all exact
-
-
-def _q703_sql(tbl: str, d: str, mat: str):
-    # square-and-multiply stage for 2^(p-1) mod p^2, MSB-first
-    def wstage(i: int) -> str:
-        return (f"(((acc*acc) % (p*p)) * (1 + ((p - 1) {{d}}"
-                f" {2 ** i}) % 2)) % (p*p)")
-
-    # k^(p-2) mod p stages (Fermat inverse), 7 bits suffice
-    def istage(i: int) -> str:
-        return (f"(((acc*acc) % p) * (CASE WHEN ((p - 2) {{d}}"
-                f" {2 ** i}) % 2 = 1 THEN k ELSE 1 END)) % p")
-
-    parts = [
-        f"d50 AS (SELECT DISTINCT CAST(doc_id % 50 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        f"d30 AS (SELECT DISTINCT CAST(doc_id % 30 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        f"dv AS (SELECT DISTINCT CAST(doc_id % 37 + 2 AS"
-        f" BIGINT) AS q FROM {tbl})",
-        # all primes below 1502 by trial division
-        "nd AS{mat} (SELECT hi.a*30 + lo.a + 2 AS n\n"
-        "         FROM d50 hi CROSS JOIN d30 lo)",
-        "pr AS{mat} (SELECT t.n AS p FROM (\n"
-        "           SELECT n.n, sum(CASE WHEN q.q < n.n AND\n"
-        "             q.q*q.q <= n.n AND n.n % q.q = 0 THEN 1\n"
-        "             ELSE 0 END) AS nf\n"
-        "           FROM nd n CROSS JOIN dv q GROUP BY n.n) t\n"
-        "         WHERE t.nf = 0)",
-        "w0 AS{mat} (SELECT p, CAST(1 AS BIGINT) AS acc"
-        " FROM pr)",
-    ]
-    for s, i in enumerate(range(10, -1, -1)):
-        parts.append(
-            f"w{s + 1} AS{{mat}} (SELECT p, CAST({wstage(i)}"
-            f" AS BIGINT) AS acc FROM w{s})")
-    parts += [
-        # Wieferich: 2^(p-1) = 1 mod p^2 — exactly one below
-        # 1502; Fermat rides free at modulus p
-        "wf AS (SELECT\n"
-        "           CAST(sum(CASE WHEN acc = 1 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS n_wieferich,\n"
-        "           CAST(max(CASE WHEN acc = 1 THEN p ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS wief_witness,\n"
-        "           CAST(sum(CASE WHEN p > 2 AND acc % p <> 1"
-        " THEN 1 ELSE 0 END)\n"
-        "             AS BIGINT) AS fermat_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_primes\n"
-        "         FROM w11)",
-        # Wolstenholme: primes <= 100, inverses 1..p-1 mod p
-        "kp AS{mat} (SELECT r.p, n.n - 1 AS k FROM pr r\n"
-        "         JOIN nd n ON n.n - 1 >= 1 AND n.n - 1 <"
-        " r.p\n"
-        "         WHERE r.p <= 100)",
-        "v0 AS{mat} (SELECT p, k, CAST(1 AS BIGINT) AS acc"
-        " FROM kp)",
-    ]
-    for s, i in enumerate(range(6, -1, -1)):
-        parts.append(
-            f"v{s + 1} AS{{mat}} (SELECT p, k, CAST({istage(i)}"
-            f" AS BIGINT) AS acc FROM v{s})")
-    parts += [
-        # Hensel lift to modulus p^2: i2 = i (2 - k i) mod p^2,
-        # certified by k i2 = 1 mod p^2 at every pair
-        "hl AS{mat} (SELECT p, k,\n"
-        "           CAST((acc * ((2*p*p + 2 - k*acc) % (p*p)))"
-        " % (p*p)\n"
-        "             AS BIGINT) AS iv2 FROM v7)",
-        "hv AS (SELECT CAST(sum(CASE WHEN (k*iv2) % (p*p) <> 1\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS inv_viol\n"
-        "         FROM hl)",
-        # the harmonic numerator: sum of inverses mod p^2
-        "ws AS{mat} (SELECT p, CAST(sum(iv2) % (p*p) AS"
-        " BIGINT) AS hsum\n"
-        "         FROM hl GROUP BY p)",
-        "wv AS (SELECT CAST(sum(CASE WHEN p >= 5 AND hsum <> 0\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS wol_viol\n"
-        "         FROM ws)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT s.p, s.hsum,\n"
-        "       f.n_wieferich, f.wief_witness, f.fermat_viol,\n"
-        "       f.n_primes, h.inv_viol, v.wol_viol, l.n_docs\n"
-        "FROM ws s CROSS JOIN wf f CROSS JOIN hv h\n"
-        "CROSS JOIN wv v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q703_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q703_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q703_wieferich_wolstenholme",
-       "WITH " + _q703_join("documents", "//", " MATERIALIZED"))
-def q703(spark, sf_dir):
-    """The Wieferich search and Wolstenholme's theorem — two
-    mod-p^2 phenomena swept exactly, with Hensel lifting
-    certified along the way (Wieferich 1909: 2^(p-1) = 1 mod
-    p^2 connects to Fermat's Last Theorem's first case;
-    Wolstenholme 1862: the harmonic numerator H_{p-1} vanishes
-    mod p^2 for p >= 5).  All 239 primes below 1502
-    materialize by relational trial division; 2^(p-1) mod p^2
-    computes per prime by eleven unrolled square-and-multiply
-    stages (MSB-first, the multiplier 1 + bit), and the sweep
-    finds EXACTLY one Wieferich prime: 1093 (n_wieferich == 1,
-    wief_witness == 1093 — the famous near-miss of number
-    theory, found by exhaustion; its partner 3511 sits just
-    beyond this range, and whether infinitely many exist is
-    open).  Fermat's little theorem rides the same
-    accumulator at modulus p across all 239 primes
-    (fermat_viol == 0).  Wolstenholme: for every prime p <=
-    100 and every k < p, the inverse mod p computes by seven
-    Fermat-exponent stages, then HENSEL-LIFTS to modulus p^2
-    via i' = i(2 - ki) — Newton's iteration in modular
-    arithmetic — certified by k i' = 1 mod p^2 at every one of
-    the 1042 pairs (inv_viol == 0).  The harmonic sums then
-    vanish mod p^2 at EVERY prime 5 <= p <= 100 (wol_viol ==
-    0), while the emitted rows show the boundary honestly:
-    p = 2 gives 1 and p = 3 gives 6 — the theorem's p >= 5
-    hypothesis is necessary, visible in the data.  Scale:
-    staged column arithmetic over prime dims; the sweep is
-    embarrassingly parallel."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q703_documents")
-    parts, fin = _q703_sql("q703_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q703_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        pin = (nm in ("d50", "d30", "dv", "nd", "pr", "kp",
-                      "hl", "ws")
-               or (nm[0] in "wv" and nm[1:].isdigit()))
-        if pin:
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q703_{nm}",
-                      max_rows=2000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q704: Radon's theorem + the happy ending theorem — exact
-# orientation predicates over corpus point sets, exhaustively
-
-
-def _q704_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"pt AS{{mat}} (SELECT doc_id % 10 AS i,\n"
-        f"           CAST(sum(n_chars) % 19 - 9 AS BIGINT) AS"
-        f" x,\n"
-        f"           CAST(sum(n_chars * (doc_id % 5 + 2)) % 19"
-        f" - 9\n"
-        f"             AS BIGINT) AS y\n"
-        f"         FROM {tbl} GROUP BY doc_id % 10)",
-        "qd AS{mat} (SELECT a.i AS i1, b.i AS i2, c.i AS i3,"
-        " e.i AS i4,\n"
-        "           a.x AS x1, a.y AS y1, b.x AS x2, b.y AS"
-        " y2,\n"
-        "           c.x AS x3, c.y AS y3, e.x AS x4, e.y AS"
-        " y4\n"
-        "         FROM pt a JOIN pt b ON b.i > a.i\n"
-        "         JOIN pt c ON c.i > b.i JOIN pt e ON"
-        " e.i > c.i)",
-        "rz AS{mat} (SELECT q.i1, q.i2, q.i3, q.i4,"
-        " (CASE WHEN (((q.x3-q.x2)*(q.y1-q.y2) - (q.y3-q.y2)*(q.x1-q.x2)) > 0 AND ((q.x4-q.x3)*(q.y1-q.y3) - (q.y4-q.y3)*(q.x1-q.x3)) > 0 AND ((q.x2-q.x4)*(q.y1-q.y4) - (q.y2-q.y4)*(q.x1-q.x4)) > 0) OR (((q.x3-q.x2)*(q.y1-q.y2) - (q.y3-q.y2)*(q.x1-q.x2)) < 0 AND ((q.x4-q.x3)*(q.y1-q.y3) - (q.y4-q.y3)*(q.x1-q.x3)) < 0 AND ((q.x2-q.x4)*(q.y1-q.y4) - (q.y2-q.y4)*(q.x1-q.x4)) < 0) THEN 1 ELSE 0 END) + (CASE WHEN (((q.x3-q.x1)*(q.y2-q.y1) - (q.y3-q.y1)*(q.x2-q.x1)) > 0 AND ((q.x4-q.x3)*(q.y2-q.y3) - (q.y4-q.y3)*(q.x2-q.x3)) > 0 AND ((q.x1-q.x4)*(q.y2-q.y4) - (q.y1-q.y4)*(q.x2-q.x4)) > 0) OR (((q.x3-q.x1)*(q.y2-q.y1) - (q.y3-q.y1)*(q.x2-q.x1)) < 0 AND ((q.x4-q.x3)*(q.y2-q.y3) - (q.y4-q.y3)*(q.x2-q.x3)) < 0 AND ((q.x1-q.x4)*(q.y2-q.y4) - (q.y1-q.y4)*(q.x2-q.x4)) < 0) THEN 1 ELSE 0 END) + (CASE WHEN (((q.x2-q.x1)*(q.y3-q.y1) - (q.y2-q.y1)*(q.x3-q.x1)) > 0 AND ((q.x4-q.x2)*(q.y3-q.y2) - (q.y4-q.y2)*(q.x3-q.x2)) > 0 AND ((q.x1-q.x4)*(q.y3-q.y4) - (q.y1-q.y4)*(q.x3-q.x4)) > 0) OR (((q.x2-q.x1)*(q.y3-q.y1) - (q.y2-q.y1)*(q.x3-q.x1)) < 0 AND ((q.x4-q.x2)*(q.y3-q.y2) - (q.y4-q.y2)*(q.x3-q.x2)) < 0 AND ((q.x1-q.x4)*(q.y3-q.y4) - (q.y1-q.y4)*(q.x3-q.x4)) < 0) THEN 1 ELSE 0 END) + (CASE WHEN (((q.x2-q.x1)*(q.y4-q.y1) - (q.y2-q.y1)*(q.x4-q.x1)) > 0 AND ((q.x3-q.x2)*(q.y4-q.y2) - (q.y3-q.y2)*(q.x4-q.x2)) > 0 AND ((q.x1-q.x3)*(q.y4-q.y3) - (q.y1-q.y3)*(q.x4-q.x3)) > 0) OR (((q.x2-q.x1)*(q.y4-q.y1) - (q.y2-q.y1)*(q.x4-q.x1)) < 0 AND ((q.x3-q.x2)*(q.y4-q.y2) - (q.y3-q.y2)*(q.x4-q.x2)) < 0 AND ((q.x1-q.x3)*(q.y4-q.y3) - (q.y1-q.y3)*(q.x4-q.x3)) < 0) THEN 1 ELSE 0 END) AS t13,\n"
-        "           (CASE WHEN ((q.x2-q.x1)*(q.y3-q.y1) - (q.y2-q.y1)*(q.x3-q.x1))*((q.x2-q.x1)*(q.y4-q.y1) - (q.y2-q.y1)*(q.x4-q.x1)) < 0 AND ((q.x4-q.x3)*(q.y1-q.y3) - (q.y4-q.y3)*(q.x1-q.x3))*((q.x4-q.x3)*(q.y2-q.y3) - (q.y4-q.y3)*(q.x2-q.x3)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((q.x3-q.x1)*(q.y2-q.y1) - (q.y3-q.y1)*(q.x2-q.x1))*((q.x3-q.x1)*(q.y4-q.y1) - (q.y3-q.y1)*(q.x4-q.x1)) < 0 AND ((q.x4-q.x2)*(q.y1-q.y2) - (q.y4-q.y2)*(q.x1-q.x2))*((q.x4-q.x2)*(q.y3-q.y2) - (q.y4-q.y2)*(q.x3-q.x2)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((q.x4-q.x1)*(q.y2-q.y1) - (q.y4-q.y1)*(q.x2-q.x1))*((q.x4-q.x1)*(q.y3-q.y1) - (q.y4-q.y1)*(q.x3-q.x1)) < 0 AND ((q.x3-q.x2)*(q.y1-q.y2) - (q.y3-q.y2)*(q.x1-q.x2))*((q.x3-q.x2)*(q.y4-q.y2) - (q.y3-q.y2)*(q.x4-q.x2)) < 0 THEN 1 ELSE 0 END) AS t22\n"
-        "         FROM qd q WHERE ((q.x2-q.x1)*(q.y3-q.y1) - (q.y2-q.y1)*(q.x3-q.x1)) <> 0 AND ((q.x2-q.x1)*(q.y4-q.y1) - (q.y2-q.y1)*(q.x4-q.x1)) <> 0 AND ((q.x3-q.x1)*(q.y4-q.y1) - (q.y3-q.y1)*(q.x4-q.x1)) <> 0 AND ((q.x3-q.x2)*(q.y4-q.y2) - (q.y3-q.y2)*(q.x4-q.x2)) <> 0)",
-        "rv AS (SELECT\n"
-        "           CAST(count(*) AS BIGINT) AS n_gen4,\n"
-        "           CAST(sum(t13) AS BIGINT) AS n_t13,\n"
-        "           CAST(sum(t22) AS BIGINT) AS n_t22,\n"
-        "           CAST(sum(CASE WHEN t13 + t22 < 1 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS exist_viol,\n"
-        "           CAST(sum(CASE WHEN t13 + t22 <> 1 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS unique_viol\n"
-        "         FROM rz)",
-        "f5 AS{mat} (SELECT (CASE WHEN ((f.x2-f.x1)*(f.y3-f.y1) - (f.y2-f.y1)*(f.x3-f.x1))*((f.x2-f.x1)*(f.y4-f.y1) - (f.y2-f.y1)*(f.x4-f.x1)) < 0 AND ((f.x4-f.x3)*(f.y1-f.y3) - (f.y4-f.y3)*(f.x1-f.x3))*((f.x4-f.x3)*(f.y2-f.y3) - (f.y4-f.y3)*(f.x2-f.x3)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x3-f.x1)*(f.y2-f.y1) - (f.y3-f.y1)*(f.x2-f.x1))*((f.x3-f.x1)*(f.y4-f.y1) - (f.y3-f.y1)*(f.x4-f.x1)) < 0 AND ((f.x4-f.x2)*(f.y1-f.y2) - (f.y4-f.y2)*(f.x1-f.x2))*((f.x4-f.x2)*(f.y3-f.y2) - (f.y4-f.y2)*(f.x3-f.x2)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x4-f.x1)*(f.y2-f.y1) - (f.y4-f.y1)*(f.x2-f.x1))*((f.x4-f.x1)*(f.y3-f.y1) - (f.y4-f.y1)*(f.x3-f.x1)) < 0 AND ((f.x3-f.x2)*(f.y1-f.y2) - (f.y3-f.y2)*(f.x1-f.x2))*((f.x3-f.x2)*(f.y4-f.y2) - (f.y3-f.y2)*(f.x4-f.x2)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x2-f.x1)*(f.y3-f.y1) - (f.y2-f.y1)*(f.x3-f.x1))*((f.x2-f.x1)*(f.y5-f.y1) - (f.y2-f.y1)*(f.x5-f.x1)) < 0 AND ((f.x5-f.x3)*(f.y1-f.y3) - (f.y5-f.y3)*(f.x1-f.x3))*((f.x5-f.x3)*(f.y2-f.y3) - (f.y5-f.y3)*(f.x2-f.x3)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x3-f.x1)*(f.y2-f.y1) - (f.y3-f.y1)*(f.x2-f.x1))*((f.x3-f.x1)*(f.y5-f.y1) - (f.y3-f.y1)*(f.x5-f.x1)) < 0 AND ((f.x5-f.x2)*(f.y1-f.y2) - (f.y5-f.y2)*(f.x1-f.x2))*((f.x5-f.x2)*(f.y3-f.y2) - (f.y5-f.y2)*(f.x3-f.x2)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x5-f.x1)*(f.y2-f.y1) - (f.y5-f.y1)*(f.x2-f.x1))*((f.x5-f.x1)*(f.y3-f.y1) - (f.y5-f.y1)*(f.x3-f.x1)) < 0 AND ((f.x3-f.x2)*(f.y1-f.y2) - (f.y3-f.y2)*(f.x1-f.x2))*((f.x3-f.x2)*(f.y5-f.y2) - (f.y3-f.y2)*(f.x5-f.x2)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x2-f.x1)*(f.y4-f.y1) - (f.y2-f.y1)*(f.x4-f.x1))*((f.x2-f.x1)*(f.y5-f.y1) - (f.y2-f.y1)*(f.x5-f.x1)) < 0 AND ((f.x5-f.x4)*(f.y1-f.y4) - (f.y5-f.y4)*(f.x1-f.x4))*((f.x5-f.x4)*(f.y2-f.y4) - (f.y5-f.y4)*(f.x2-f.x4)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x4-f.x1)*(f.y2-f.y1) - (f.y4-f.y1)*(f.x2-f.x1))*((f.x4-f.x1)*(f.y5-f.y1) - (f.y4-f.y1)*(f.x5-f.x1)) < 0 AND ((f.x5-f.x2)*(f.y1-f.y2) - (f.y5-f.y2)*(f.x1-f.x2))*((f.x5-f.x2)*(f.y4-f.y2) - (f.y5-f.y2)*(f.x4-f.x2)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x5-f.x1)*(f.y2-f.y1) - (f.y5-f.y1)*(f.x2-f.x1))*((f.x5-f.x1)*(f.y4-f.y1) - (f.y5-f.y1)*(f.x4-f.x1)) < 0 AND ((f.x4-f.x2)*(f.y1-f.y2) - (f.y4-f.y2)*(f.x1-f.x2))*((f.x4-f.x2)*(f.y5-f.y2) - (f.y4-f.y2)*(f.x5-f.x2)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x3-f.x1)*(f.y4-f.y1) - (f.y3-f.y1)*(f.x4-f.x1))*((f.x3-f.x1)*(f.y5-f.y1) - (f.y3-f.y1)*(f.x5-f.x1)) < 0 AND ((f.x5-f.x4)*(f.y1-f.y4) - (f.y5-f.y4)*(f.x1-f.x4))*((f.x5-f.x4)*(f.y3-f.y4) - (f.y5-f.y4)*(f.x3-f.x4)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x4-f.x1)*(f.y3-f.y1) - (f.y4-f.y1)*(f.x3-f.x1))*((f.x4-f.x1)*(f.y5-f.y1) - (f.y4-f.y1)*(f.x5-f.x1)) < 0 AND ((f.x5-f.x3)*(f.y1-f.y3) - (f.y5-f.y3)*(f.x1-f.x3))*((f.x5-f.x3)*(f.y4-f.y3) - (f.y5-f.y3)*(f.x4-f.x3)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x5-f.x1)*(f.y3-f.y1) - (f.y5-f.y1)*(f.x3-f.x1))*((f.x5-f.x1)*(f.y4-f.y1) - (f.y5-f.y1)*(f.x4-f.x1)) < 0 AND ((f.x4-f.x3)*(f.y1-f.y3) - (f.y4-f.y3)*(f.x1-f.x3))*((f.x4-f.x3)*(f.y5-f.y3) - (f.y4-f.y3)*(f.x5-f.x3)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x3-f.x2)*(f.y4-f.y2) - (f.y3-f.y2)*(f.x4-f.x2))*((f.x3-f.x2)*(f.y5-f.y2) - (f.y3-f.y2)*(f.x5-f.x2)) < 0 AND ((f.x5-f.x4)*(f.y2-f.y4) - (f.y5-f.y4)*(f.x2-f.x4))*((f.x5-f.x4)*(f.y3-f.y4) - (f.y5-f.y4)*(f.x3-f.x4)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x4-f.x2)*(f.y3-f.y2) - (f.y4-f.y2)*(f.x3-f.x2))*((f.x4-f.x2)*(f.y5-f.y2) - (f.y4-f.y2)*(f.x5-f.x2)) < 0 AND ((f.x5-f.x3)*(f.y2-f.y3) - (f.y5-f.y3)*(f.x2-f.x3))*((f.x5-f.x3)*(f.y4-f.y3) - (f.y5-f.y3)*(f.x4-f.x3)) < 0 THEN 1 ELSE 0 END) + (CASE WHEN ((f.x5-f.x2)*(f.y3-f.y2) - (f.y5-f.y2)*(f.x3-f.x2))*((f.x5-f.x2)*(f.y4-f.y2) - (f.y5-f.y2)*(f.x4-f.x2)) < 0 AND ((f.x4-f.x3)*(f.y2-f.y3) - (f.y4-f.y3)*(f.x2-f.x3))*((f.x4-f.x3)*(f.y5-f.y3) - (f.y4-f.y3)*(f.x5-f.x3)) < 0 THEN 1 ELSE 0 END) AS n_conv\n"
-        "         FROM (SELECT a.x AS x1, a.y AS y1, b.x AS"
-        " x2,\n"
-        "             b.y AS y2, c.x AS x3, c.y AS y3,\n"
-        "             e.x AS x4, e.y AS y4, g.x AS x5, g.y AS"
-        " y5\n"
-        "           FROM pt a JOIN pt b ON b.i > a.i\n"
-        "           JOIN pt c ON c.i > b.i\n"
-        "           JOIN pt e ON e.i > c.i\n"
-        "           JOIN pt g ON g.i > e.i) f\n"
-        "         WHERE ((f.x2-f.x1)*(f.y3-f.y1) - (f.y2-f.y1)*(f.x3-f.x1)) <> 0 AND ((f.x2-f.x1)*(f.y4-f.y1) - (f.y2-f.y1)*(f.x4-f.x1)) <> 0 AND ((f.x2-f.x1)*(f.y5-f.y1) - (f.y2-f.y1)*(f.x5-f.x1)) <> 0 AND ((f.x3-f.x1)*(f.y4-f.y1) - (f.y3-f.y1)*(f.x4-f.x1)) <> 0 AND ((f.x3-f.x1)*(f.y5-f.y1) - (f.y3-f.y1)*(f.x5-f.x1)) <> 0 AND ((f.x4-f.x1)*(f.y5-f.y1) - (f.y4-f.y1)*(f.x5-f.x1)) <> 0 AND ((f.x3-f.x2)*(f.y4-f.y2) - (f.y3-f.y2)*(f.x4-f.x2)) <> 0 AND ((f.x3-f.x2)*(f.y5-f.y2) - (f.y3-f.y2)*(f.x5-f.x2)) <> 0 AND ((f.x4-f.x2)*(f.y5-f.y2) - (f.y4-f.y2)*(f.x5-f.x2)) <> 0 AND ((f.x4-f.x3)*(f.y5-f.y3) - (f.y4-f.y3)*(f.x5-f.x3)) <> 0)",
-        "hv AS (SELECT CAST(count(*) AS BIGINT) AS n_gen5,\n"
-        "           CAST(sum(CASE WHEN n_conv < 1 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS happy_viol FROM f5)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT p.i, p.x, p.y,\n"
-        "       r.n_gen4, r.n_t13, r.n_t22, r.exist_viol,\n"
-        "       r.unique_viol, h.n_gen5, h.happy_viol,"
-        " l.n_docs\n"
-        "FROM pt p CROSS JOIN rv r CROSS JOIN hv h\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q704_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q704_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q704_radon_happy_ending",
-       "WITH " + _q704_join("documents", "//", " MATERIALIZED"))
-def q704(spark, sf_dir):
-    """Radon's theorem and the happy ending theorem on corpus
-    point sets — every partition of every quadruple tested
-    with exact integer orientation predicates (Radon 1921: any
-    4 points split into two parts with intersecting hulls;
-    Erdos–Szekeres 1935: any 5 points in general position
-    contain a convex quadrilateral — the problem that
-    'happy-ended' in a marriage and founded Ramsey-type
-    geometry; the same orientation tests underpin every
-    convex-hull and segment-intersection kernel in this repo).
-    Ten points derive from corpus residue sums (coordinates in
-    [-9,9], moving with SF); all 210 quadruples form by
-    ordered joins, general position enforced by four nonzero
-    orientation determinants.  For each, all SEVEN nontrivial
-    partitions are tested — the four 1-vs-3 splits by strict
-    point-in-triangle (three same-sign orientations) and the
-    three 2-vs-2 splits by proper segment crossing (opposite
-    orientations twice over) — and Radon lands as both halves:
-    at least one partition intersects (exist_viol == 0) and
-    EXACTLY one does (unique_viol == 0, the general-position
-    uniqueness), with the census emitted (n_t13 quadruples
-    have a point inside the others' triangle, n_t22 are in
-    convex position).  The happy ending theorem rides the same
-    predicates: every general-position 5-subset contains at
-    least one 4-subset in convex position — tested as 15
-    crossing checks per subset (happy_viol == 0 over all of
-    them).  Scale: orientation arithmetic over dim-sized
-    joins; certificates corpus-size independent."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q704_documents")
-    parts, fin = _q704_sql("q704_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q704_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("pt", "qd", "rz", "f5"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q704_{nm}",
-                      max_rows=300)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q705: Egyptian fractions — the Fibonacci–Sylvester greedy
-# with its termination proof carried as data
-
-
-def _q705_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"qd AS (SELECT DISTINCT CAST(doc_id % 19 + 2 AS"
-        f" BIGINT) AS q FROM {tbl})",
-        f"pd AS (SELECT DISTINCT CAST(doc_id % 19 + 1 AS"
-        f" BIGINT) AS p FROM {tbl})",
-        f"gd AS (SELECT DISTINCT CAST(doc_id % 19 + 2 AS"
-        f" BIGINT) AS g FROM {tbl})",
-        # all reduced fractions p/q < 1 with q <= 20
-        "fr AS{mat} (SELECT t.p, t.q FROM (\n"
-        "           SELECT p.p, q.q, sum(CASE WHEN p.p % g.g ="
-        " 0\n"
-        "             AND q.q % g.g = 0 THEN 1 ELSE 0 END) AS"
-        " cg\n"
-        "           FROM pd p JOIN qd q ON p.p < q.q\n"
-        "           CROSS JOIN gd g GROUP BY p.p, q.q) t\n"
-        "         WHERE t.cg = 0)",
-        # greedy stages: x = ceil(den/num), remainder
-        # (num x - den)/(den x), running sum sn/sd, certificates
-        # accumulated per row
-        "s0 AS (SELECT p, q, p AS n, q AS den,\n"
-        "           CAST(0 AS BIGINT) AS px, CAST(0 AS BIGINT)"
-        " AS sn,\n"
-        "           CAST(1 AS BIGINT) AS sd,\n"
-        "           CAST(0 AS BIGINT) AS steps,\n"
-        "           CAST(0 AS BIGINT) AS dsv,\n"
-        "           CAST(0 AS BIGINT) AS lsv,\n"
-        "           CAST(0 AS BIGINT) AS stv FROM fr)",
-    ]
-    for k in range(1, 6):
-        parts.append(
-            f"s{k} AS{{mat}} (SELECT p, q,\n"
-            f"           CASE WHEN n > 0 THEN n*((den + n - 1)"
-            f" {{d}} n) - den\n"
-            f"             ELSE n END AS n,\n"
-            f"           CASE WHEN n > 0 THEN den*((den + n -"
-            f" 1) {{d}} n)\n"
-            f"             ELSE den END AS den,\n"
-            f"           CASE WHEN n > 0 THEN (den + n - 1)"
-            f" {{d}} n\n"
-            f"             ELSE px END AS px,\n"
-            f"           CASE WHEN n > 0 THEN sn*((den + n - 1)"
-            f" {{d}} n) + sd\n"
-            f"             ELSE sn END AS sn,\n"
-            f"           CASE WHEN n > 0 THEN sd*((den + n - 1)"
-            f" {{d}} n)\n"
-            f"             ELSE sd END AS sd,\n"
-            f"           steps + CASE WHEN n > 0 THEN 1 ELSE 0"
-            f" END AS steps,\n"
-            f"           dsv + CASE WHEN n > 0 AND n*((den + n"
-            f" - 1) {{d}} n)\n"
-            f"             - den >= n THEN 1 ELSE 0 END AS"
-            f" dsv,\n"
-            f"           lsv + CASE WHEN n > 0 AND NOT\n"
-            f"             (((den + n - 1) {{d}} n) - 1)*n <"
-            f" den THEN 1\n"
-            f"             WHEN n > 0 AND NOT den <= ((den + n"
-            f" - 1) {{d}} n)*n\n"
-            f"             THEN 1 ELSE 0 END AS lsv,\n"
-            f"           stv + CASE WHEN n > 0 AND (den + n -"
-            f" 1) {{d}} n\n"
-            f"             <= px THEN 1 ELSE 0 END AS stv\n"
-            f"         FROM s{k - 1})")
-    parts += [
-        "cv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN n <> 0 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS term_viol,\n"
-        "           CAST(sum(dsv) AS BIGINT) AS descent_viol,\n"
-        "           CAST(sum(lsv) AS BIGINT) AS least_viol,\n"
-        "           CAST(sum(stv) AS BIGINT) AS strict_viol,\n"
-        "           CAST(sum(CASE WHEN sn*q <> sd*p THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS recon_viol,\n"
-        "           CAST(max(steps) AS BIGINT) AS max_steps,\n"
-        "           CAST(count(*) AS BIGINT) AS n_fracs\n"
-        "         FROM s5)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT s.p, s.q, s.steps, s.sn, s.sd,\n"
-        "       c.term_viol, c.descent_viol, c.least_viol,\n"
-        "       c.strict_viol, c.recon_viol, c.max_steps,\n"
-        "       c.n_fracs, l.n_docs\n"
-        "FROM s5 s CROSS JOIN cv c CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q705_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q705_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q705_egyptian_greedy",
-       "WITH " + _q705_join("documents", "//", " MATERIALIZED"))
-def q705(spark, sf_dir):
-    """Egyptian fractions by the Fibonacci–Sylvester greedy,
-    with the termination PROOF carried as per-stage data
-    (Fibonacci 1202, Sylvester 1880; every rational in (0,1)
-    is a finite sum of distinct unit fractions, and the greedy
-    argument — the numerator strictly drops each step — is the
-    classic descent proof, here checked at every step of every
-    instance instead of asserted).  All 127 reduced fractions
-    p/q with q <= 20 materialize from corpus dims (reducedness
-    by a relational gcd sweep); five unrolled greedy stages
-    take x = ceil(den/num) and replace num/den by (num x -
-    den)/(den x), freezing finished rows.  Five certificates,
-    all exact BIGINT: the greedy choice is the LEAST feasible
-    denominator ((x-1) num < den <= x num at every live step,
-    least_viol == 0); the numerator STRICTLY DECREASES at
-    every live step (descent_viol == 0 — this IS the
-    termination theorem, so max_steps <= p is forced, and
-    indeed every instance finishes within five stages,
-    term_viol == 0); successive unit denominators strictly
-    increase (strict_viol == 0 — the expansion is genuinely
-    Egyptian, distinct parts); and the accumulated sum sn/sd
-    reconstructs p/q EXACTLY by cross-multiplication
-    (recon_viol == 0) even as denominators explode — the
-    emitted worst case 16/17 = 1/2 + 1/3 + 1/10 + 1/128 +
-    1/32640 carries sd = 251,596,800 computed exactly.  Scale:
-    five column-arithmetic stages over a 127-row dim."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q705_documents")
-    parts, fin = _q705_sql("q705_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q705_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("qd", "pd", "gd", "fr") or \
-                (nm[0] == "s" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q705_{nm}",
-                      max_rows=500)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q706: absorbing-chain expectations — coupon collector and
-# gambler's ruin, closed forms welded to Bellman re-audits
-
-
-_Q706_EV = '(0, 882), (1, 822), (2, 750), (3, 660), (4, 540), (5, 360), (6, 0)'
-_Q706_WN = '(0, 0), (1, 128), (2, 192), (3, 224), (4, 240), (5, 248), (6, 252), (7, 254), (8, 255)'
-_Q706_CB = '(1, 6), (2, 15), (3, 20), (4, 15), (5, 6), (6, 1)'
-
-
-def _q706_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"kd AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS k FROM {tbl})",
-        f"jd AS (SELECT DISTINCT CAST(doc_id % 6 + 1 AS"
-        f" BIGINT) AS j FROM {tbl})",
-        f"idm AS (SELECT DISTINCT CAST(doc_id % 9 AS BIGINT)"
-        f" AS i FROM {tbl})",
-        "ev AS (SELECT CAST(k AS BIGINT) AS k, CAST(e AS"
-        " BIGINT) AS e\n"
-        "         FROM (VALUES {ev}) t(k, e))",
-        "wn AS (SELECT CAST(i AS BIGINT) AS i, CAST(w AS"
-        " BIGINT) AS w\n"
-        "         FROM (VALUES {wn}) t(i, w))",
-        "cb AS (SELECT CAST(j AS BIGINT) AS j, CAST(c AS"
-        " BIGINT) AS c\n"
-        "         FROM (VALUES {cb}) t(j, c))",
-        # coupon collector (n = 6, values x60): the Bellman
-        # recurrence (6-k) E_k = 6 + (6-k) E_{k+1}, every k
-        "cbl AS (SELECT CAST(sum(CASE WHEN (6 - a.k)*a.e <>\n"
-        "           360 + (6 - a.k)*b.e THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "           AS cc_bell_viol\n"
-        "         FROM ev a JOIN ev b ON b.k = a.k + 1)",
-        # closed form 6 H_6 with exact divisibility, and the
-        # inclusion-exclusion tail identity — two more machines
-        "chm AS (SELECT\n"
-        "           CAST(sum(360 {d} j) AS BIGINT) AS hsum,\n"
-        "           CAST(sum(360 % j) AS BIGINT) AS"
-        " hdiv_viol\n"
-        "         FROM jd)",
-        "cie AS (SELECT CAST(sum(CASE WHEN c.j % 2 = 1 THEN 1\n"
-        "           ELSE -1 END * c.c * (360 {d} c.j)) AS"
-        " BIGINT) AS iesum\n"
-        "         FROM cb c)",
-        "ccv AS (SELECT CAST(\n"
-        "           CASE WHEN h.hsum <> e0.e THEN 1 ELSE 0"
-        " END\n"
-        "           + CASE WHEN i2.iesum <> e0.e THEN 1 ELSE 0"
-        " END\n"
-        "           + h.hdiv_viol AS BIGINT) AS closed_viol\n"
-        "         FROM chm h CROSS JOIN cie i2\n"
-        "         CROSS JOIN (SELECT e FROM ev WHERE k = 0)"
-        " e0)",
-        # gambler's ruin (p = 2/3, N = 8, values x255): win
-        # probabilities and expected durations
-        "gr AS{mat} (SELECT w.i, w.w,\n"
-        "           CAST(24*w.w - 765*w.i AS BIGINT) AS dn\n"
-        "         FROM wn w)",
-        "gcl AS (SELECT CAST(sum(CASE WHEN g.i >= 1 AND\n"
-        "           g.w <> 256 - (256 {d} (" + " ".join(
-            ["CASE g.i"] + [f"WHEN {i} THEN {2 ** i}"
-                            for i in range(1, 9)])
-        + " END))\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " wclosed_viol\n"
-        "         FROM gr g)",
-        "gbl AS (SELECT\n"
-        "           CAST(sum(CASE WHEN 3*b.w <> 2*c.w + a.w\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " ruin_bell_viol,\n"
-        "           CAST(sum(CASE WHEN 3*b.dn <> 765 + 2*c.dn"
-        " + a.dn\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " dur_bell_viol,\n"
-        "           CAST(sum(CASE WHEN b.dn < 0 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS dur_sign_viol\n"
-        "         FROM gr b JOIN gr a ON a.i = b.i - 1\n"
-        "         JOIN gr c ON c.i = b.i + 1)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT g.i, g.w AS win255, g.dn AS dur255,\n"
-        "       e.e AS coupon_e60,\n"
-        "       b.cc_bell_viol, v.closed_viol,\n"
-        "       c.wclosed_viol, r.ruin_bell_viol,\n"
-        "       r.dur_bell_viol, r.dur_sign_viol, l.n_docs\n"
-        "FROM gr g LEFT JOIN ev e ON e.k = g.i\n"
-        "CROSS JOIN cbl b CROSS JOIN ccv v CROSS JOIN gcl c\n"
-        "CROSS JOIN gbl r CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q706_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q706_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{ev}", _Q706_EV).replace("{wn}",
-                                                _Q706_WN)
-             .replace("{cb}", _Q706_CB))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q706_coupon_gambler",
-       "WITH " + _q706_join("documents", "//", " MATERIALIZED"))
-def q706(spark, sf_dir):
-    """Coupon collector and gambler's ruin — the two textbook
-    absorbing chains, their closed forms welded to Bellman
-    re-audits in exact integer arithmetic (de Moivre 1712 for
-    the ruin, the collector via Euler's harmonic numbers; the
-    expectations behind cache warming, retry budgets, and
-    random-sampling coverage estimates).  Coupon collector at
-    n = 6, values scaled by 60: the inlined expectations E_k
-    (882/60 = 14.7 draws from empty) are re-certified by
-    every Bellman equation (6-k) E_k = 6 + (6-k) E_{k+1}
-    (cc_bell_viol == 0), by the closed form 6 H_6 computed as
-    an exactly-divisible harmonic sum (360/j integer for every
-    j <= 6), AND by the inclusion-exclusion tail identity
-    sum (-1)^(j+1) C(6,j) 360/j = 882 — three derivations
-    sharing nothing, all landing on the same integer
-    (closed_viol == 0).  Gambler's ruin with drift (p = 2/3,
-    N = 8, values x255): win probabilities w_i = 256 -
-    2^(8-i) over 255 match their closed form (wclosed_viol ==
-    0) and satisfy 3 w_i = 2 w_{i+1} + w_{i-1} at every
-    interior state (ruin_bell_viol == 0); expected durations
-    d_i = (24 w_i - 765 i)/255 — Wald's identity made integer
-    — satisfy 3 d_i = 3 + 2 d_{i+1} + d_{i-1} with absorbing
-    zeros and nonnegativity (dur_bell_viol == dur_sign_viol ==
-    0), peaking at 3081/255 ~ 12.1 steps from state 3.
-    Scale: dim algebra; every certificate is a handful of
-    grouped joins."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q706_documents")
-    parts, fin = _q706_sql("q706_documents", "div", "")
-    kept = [fr.replace("{mat}", "").replace("{d}", "div")
-            .replace("{ev}", _Q706_EV).replace("{wn}", _Q706_WN)
-            .replace("{cb}", _Q706_CB) for fr in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q707: ballot problem + discrete arcsine laws — total 2^16
-# walk exhaustion with Levy's equidistribution as data
-
-
-_Q707_BD = '(9, 1430), (10, 2002), (11, 1638), (12, 910), (13, 350), (14, 90), (15, 14), (16, 1)'
-_Q707_AZ = '(0, 12870), (2, 6864), (4, 5544), (6, 5040), (8, 4900), (10, 5040), (12, 5544), (14, 6864), (16, 12870)'
-
-
-def _q707_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"b256 AS (SELECT DISTINCT CAST(doc_id % 256 AS"
-        f" BIGINT) AS b FROM {tbl})",
-        "bd AS (SELECT CAST(a AS BIGINT) AS a, CAST(n AS"
-        " BIGINT) AS n\n"
-        "         FROM (VALUES {bd}) t(a, n))",
-        "az AS (SELECT CAST(l AS BIGINT) AS l, CAST(n AS"
-        " BIGINT) AS n\n"
-        "         FROM (VALUES {az}) t(l, n))",
-        "mm AS{mat} (SELECT hi.b*256 + lo.b AS m\n"
-        "         FROM b256 hi CROSS JOIN b256 lo)",
-        # one projection computes, per walk: up-step count,
-        # strict-lead indicator, last zero, time on + side
-        "wk AS{mat} (SELECT g.m,\n"
-        "           CAST((((g.m {d} 1) % 2) + ((g.m {d} 2) % 2) + ((g.m {d} 4) % 2) + ((g.m {d} 8) % 2) + ((g.m {d} 16) % 2) + ((g.m {d} 32) % 2) + ((g.m {d} 64) % 2) + ((g.m {d} 128) % 2) + ((g.m {d} 256) % 2) + ((g.m {d} 512) % 2) + ((g.m {d} 1024) % 2) + ((g.m {d} 2048) % 2) + ((g.m {d} 4096) % 2) + ((g.m {d} 8192) % 2) + ((g.m {d} 16384) % 2) + ((g.m {d} 32768) % 2)) AS BIGINT) AS a,\n"
-        "           CASE WHEN least(((2*((g.m {d} 1) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1)), ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1) + (2*((g.m {d} 32768) % 2) - 1))) > 0 THEN 1 ELSE 0 END"
-        " AS lead,\n"
-        "           CAST(greatest(CAST(0 AS BIGINT), CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1)) = 0 THEN 2 ELSE 0 END, CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1)) = 0 THEN 4 ELSE 0 END, CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1)) = 0 THEN 6 ELSE 0 END, CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1)) = 0 THEN 8 ELSE 0 END, CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1)) = 0 THEN 10 ELSE 0 END, CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1)) = 0 THEN 12 ELSE 0 END, CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1)) = 0 THEN 14 ELSE 0 END, CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1) + (2*((g.m {d} 32768) % 2) - 1)) = 0 THEN 16 ELSE 0 END) AS BIGINT) AS lz,\n"
-        "           CAST(((CASE WHEN ((2*((g.m {d} 1) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1)) = 0 AND 1 > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1)) > 0 THEN 1 ELSE 0 END) + (CASE WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1) + (2*((g.m {d} 32768) % 2) - 1)) > 0 THEN 1 WHEN ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1) + (2*((g.m {d} 32768) % 2) - 1)) = 0 AND ((2*((g.m {d} 1) % 2) - 1) + (2*((g.m {d} 2) % 2) - 1) + (2*((g.m {d} 4) % 2) - 1) + (2*((g.m {d} 8) % 2) - 1) + (2*((g.m {d} 16) % 2) - 1) + (2*((g.m {d} 32) % 2) - 1) + (2*((g.m {d} 64) % 2) - 1) + (2*((g.m {d} 128) % 2) - 1) + (2*((g.m {d} 256) % 2) - 1) + (2*((g.m {d} 512) % 2) - 1) + (2*((g.m {d} 1024) % 2) - 1) + (2*((g.m {d} 2048) % 2) - 1) + (2*((g.m {d} 4096) % 2) - 1) + (2*((g.m {d} 8192) % 2) - 1) + (2*((g.m {d} 16384) % 2) - 1)) > 0 THEN 1 ELSE 0 END)) AS BIGINT) AS pt\n"
-        "         FROM mm g)",
-        # Bertrand's ballot theorem: strict leads = C(16,a)(a-b)/16
-        "bv AS (SELECT CAST(sum(CASE WHEN t.nl <>"
-        " coalesce(x.n, 0)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " ballot_viol\n"
-        "         FROM (SELECT a, sum(lead) AS nl FROM wk\n"
-        "           WHERE a > 8 GROUP BY a) t\n"
-        "         LEFT JOIN bd x ON x.a = t.a)",
-        # discrete arcsine: last-zero census = C(L,L/2)C(16-L,8-L/2)
-        "lv AS (SELECT CAST(sum(CASE WHEN t.n <> coalesce(x.n,"
-        " -1)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " arcsine_viol\n"
-        "         FROM (SELECT lz, count(*) AS n FROM wk"
-        " GROUP BY lz) t\n"
-        "         LEFT JOIN az x ON x.l = t.lz)",
-        # Levy equidistribution: time-on-positive-side census
-        # equals the last-zero census, value by value
-        "ev AS (SELECT CAST(sum(CASE WHEN coalesce(t1.n, 0) <>\n"
-        "           coalesce(t2.n, 0) THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "           AS equi_viol\n"
-        "         FROM (SELECT lz AS v, count(*) AS n FROM wk\n"
-        "           GROUP BY lz) t1\n"
-        "         FULL OUTER JOIN (SELECT pt AS v, count(*) AS"
-        " n\n"
-        "           FROM wk GROUP BY pt) t2 ON t2.v = t1.v)",
-        "tv AS (SELECT CAST(count(*) AS BIGINT) AS n_walks"
-        " FROM wk)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT z.lz AS l, z.n AS n_lastzero,\n"
-        "       p2.n AS n_postime, x.n AS expected_n,\n"
-        "       b.ballot_viol, v.arcsine_viol, e.equi_viol,\n"
-        "       t.n_walks, l.n_docs\n"
-        "FROM (SELECT lz, CAST(count(*) AS BIGINT) AS n FROM"
-        " wk GROUP BY lz) z\n"
-        "JOIN (SELECT pt, CAST(count(*) AS BIGINT) AS n FROM"
-        " wk GROUP BY pt) p2\n"
-        "  ON p2.pt = z.lz\n"
-        "JOIN az x ON x.l = z.lz\n"
-        "CROSS JOIN bv b CROSS JOIN lv v CROSS JOIN ev e\n"
-        "CROSS JOIN tv t CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q707_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q707_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{bd}", _Q707_BD).replace("{az}",
-                                                _Q707_AZ))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q707_ballot_arcsine",
-       "WITH " + _q707_join("documents", "//", " MATERIALIZED"))
-def q707(spark, sf_dir):
-    """Bertrand's ballot theorem and the discrete arcsine laws
-    by total exhaustion over all 65536 sixteen-step walks,
-    with Levy's equidistribution landing as two independently
-    computed censuses that must be equal (Bertrand 1887,
-    arcsine laws via Levy 1939 and Feller's classic chapter
-    III — the counterintuitive U-shape: a fair random walk
-    spends most of its time on ONE side, and 'last tie' is
-    most likely at the very start or very end).  Every walk is
-    a 16-bit code from two corpus dims; ONE projection
-    computes its up-step count, strict-lead indicator (all 16
-    prefix sums positive, via a least() over explicit prefix
-    expressions), last visit to zero, and time on the
-    positive side (the positive-excursion convention: a step
-    counts if it ends above zero, or returns to zero from
-    above).  Bertrand: for every a > 8, the number of walks
-    where the leader stays STRICTLY ahead throughout equals
-    C(16,a)(a-b)/16 exactly — 1430, 2002, 1638, 910, 350, 90,
-    14, 1 (ballot_viol == 0, the cycle-lemma count verified
-    against the pinned closed form).  Arcsine: the last-zero
-    census equals C(L, L/2) C(16-L, 8-L/2) at every even L —
-    the U-shaped 12870/6864/5544/5040/4900/... (arcsine_viol
-    == 0).  And the deep one: the time-on-positive-side
-    census, computed with no reference to last zeros, EQUALS
-    the last-zero census value for value (equi_viol == 0) —
-    Levy's equidistribution theorem as a FULL OUTER JOIN with
-    zero mismatches.  Scale: one 65536-row projection and
-    three grouped censuses — pure whole-stage codegen."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q707_documents")
-    parts, fin = _q707_sql("q707_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q707_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{bd}", _Q707_BD).replace("{az}",
-                                                 _Q707_AZ))
-        nm = fr.split(" AS ", 1)[0].strip()
-        body = _qual(fr.split(" AS ", 1)[1].strip())
-        if nm == "b256":
-            _pin_view(spark, body[1:-1], f"q707_{nm}",
-                      max_rows=300)
-            done.append(nm)
-        elif nm in ("bd", "az", "mm"):
-            # tiny dims + the 65536-row cross product: lazy views
-            # (mm is referenced once, by wk)
-            spark.sql(body[1:-1]).createOrReplaceTempView(
-                f"q707_{nm}")
-            done.append(nm)
-        elif nm == "wk":
-            # the one stage worth materializing: ~7 downstream
-            # references to a giant one-projection codegen —
-            # JVM-side checkpoint, no 65k-row pandas roundtrip
-            # (the former _pin_view of mm AND wk cost 7.3 s)
-            _ckpt_view(spark, body[1:-1], f"q707_{nm}")
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q708: Sperner's lemma — every admissible labeling of the
-# side-4 triangulation, exhaustively; rainbow count always odd
-
-
-_Q708_HIST = '(1, 2920), (3, 6192), (5, 3840), (7, 848), (9, 24)'
-
-
-def _q708_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d32 AS (SELECT DISTINCT CAST(doc_id % 32 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        f"d16 AS (SELECT DISTINCT CAST(doc_id % 16 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        f"d27 AS (SELECT DISTINCT CAST(doc_id % 27 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        "hx AS (SELECT CAST(r AS BIGINT) AS r, CAST(n AS"
-        " BIGINT) AS n\n"
-        "         FROM (VALUES {hist}) t(r, n))",
-        "lb AS{mat} (SELECT hi.a*16 + lo.a AS bc, ic.a AS ic\n"
-        "         FROM d32 hi CROSS JOIN d16 lo CROSS JOIN"
-        " d27 ic)",
-        # one projection: rainbow-triangle count and bottom-edge
-        # door count per labeling
-        "rb AS{mat} (SELECT g.bc, g.ic,\n"
-        "           CAST((CASE WHEN 0 <> (((g.bc {d} 1) % 2)) AND (((g.bc {d} 1) % 2)) <> (2*((g.bc {d} 8) % 2)) AND 0 <> (2*((g.bc {d} 8) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (2*((g.bc {d} 8) % 2)) <> (((g.ic {d} 1) % 3)) AND (((g.ic {d} 1) % 3)) <> (2*((g.bc {d} 16) % 2)) AND (2*((g.bc {d} 8) % 2)) <> (2*((g.bc {d} 16) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (2*((g.bc {d} 16) % 2)) <> (((g.ic {d} 3) % 3)) AND (((g.ic {d} 3) % 3)) <> (2*((g.bc {d} 32) % 2)) AND (2*((g.bc {d} 16) % 2)) <> (2*((g.bc {d} 32) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (2*((g.bc {d} 32) % 2)) <> (1 + ((g.bc {d} 64) % 2)) AND (1 + ((g.bc {d} 64) % 2)) <> 2 AND (2*((g.bc {d} 32) % 2)) <> 2 THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 1) % 2)) <> (((g.bc {d} 2) % 2)) AND (((g.bc {d} 2) % 2)) <> (((g.ic {d} 1) % 3)) AND (((g.bc {d} 1) % 2)) <> (((g.ic {d} 1) % 3)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.ic {d} 1) % 3)) <> (((g.ic {d} 9) % 3)) AND (((g.ic {d} 9) % 3)) <> (((g.ic {d} 3) % 3)) AND (((g.ic {d} 1) % 3)) <> (((g.ic {d} 3) % 3)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.ic {d} 3) % 3)) <> (1 + ((g.bc {d} 128) % 2)) AND (1 + ((g.bc {d} 128) % 2)) <> (1 + ((g.bc {d} 64) % 2)) AND (((g.ic {d} 3) % 3)) <> (1 + ((g.bc {d} 64) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 2) % 2)) <> (((g.bc {d} 4) % 2)) AND (((g.bc {d} 4) % 2)) <> (((g.ic {d} 9) % 3)) AND (((g.bc {d} 2) % 2)) <> (((g.ic {d} 9) % 3)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.ic {d} 9) % 3)) <> (1 + ((g.bc {d} 256) % 2)) AND (1 + ((g.bc {d} 256) % 2)) <> (1 + ((g.bc {d} 128) % 2)) AND (((g.ic {d} 9) % 3)) <> (1 + ((g.bc {d} 128) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 4) % 2)) <> 1 AND 1 <> (1 + ((g.bc {d} 256) % 2)) AND (((g.bc {d} 4) % 2)) <> (1 + ((g.bc {d} 256) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 1) % 2)) <> (2*((g.bc {d} 8) % 2)) AND (2*((g.bc {d} 8) % 2)) <> (((g.ic {d} 1) % 3)) AND (((g.bc {d} 1) % 2)) <> (((g.ic {d} 1) % 3)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.ic {d} 1) % 3)) <> (2*((g.bc {d} 16) % 2)) AND (2*((g.bc {d} 16) % 2)) <> (((g.ic {d} 3) % 3)) AND (((g.ic {d} 1) % 3)) <> (((g.ic {d} 3) % 3)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.ic {d} 3) % 3)) <> (2*((g.bc {d} 32) % 2)) AND (2*((g.bc {d} 32) % 2)) <> (1 + ((g.bc {d} 64) % 2)) AND (((g.ic {d} 3) % 3)) <> (1 + ((g.bc {d} 64) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 2) % 2)) <> (((g.ic {d} 1) % 3)) AND (((g.ic {d} 1) % 3)) <> (((g.ic {d} 9) % 3)) AND (((g.bc {d} 2) % 2)) <> (((g.ic {d} 9) % 3)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.ic {d} 9) % 3)) <> (((g.ic {d} 3) % 3)) AND (((g.ic {d} 3) % 3)) <> (1 + ((g.bc {d} 128) % 2)) AND (((g.ic {d} 9) % 3)) <> (1 + ((g.bc {d} 128) % 2)) THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 4) % 2)) <> (((g.ic {d} 9) % 3)) AND (((g.ic {d} 9) % 3)) <> (1 + ((g.bc {d} 256) % 2)) AND (((g.bc {d} 4) % 2)) <> (1 + ((g.bc {d} 256) % 2)) THEN 1 ELSE 0 END) AS BIGINT) AS nrb,\n"
-        "           CAST((CASE WHEN 0 + (((g.bc {d} 1) % 2)) = 1 THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 1) % 2)) + (((g.bc {d} 2) % 2)) = 1 THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 2) % 2)) + (((g.bc {d} 4) % 2)) = 1 THEN 1 ELSE 0 END) + (CASE WHEN (((g.bc {d} 4) % 2)) + 1 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS ndoor\n"
-        "         FROM lb g)",
-        "sv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN nrb % 2 = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS sperner_viol,\n"
-        "           CAST(sum(CASE WHEN ndoor % 2 = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS door_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_labelings\n"
-        "         FROM rb)",
-        "hh AS (SELECT nrb, CAST(count(*) AS BIGINT) AS n"
-        " FROM rb\n"
-        "         GROUP BY nrb)",
-        "hv AS (SELECT CAST(sum(CASE WHEN h.n <> coalesce(x.n,"
-        " -1)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " hist_viol\n"
-        "         FROM hh h LEFT JOIN hx x ON x.r = h.nrb)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT h.nrb, h.n, x.n AS expected_n,\n"
-        "       s.sperner_viol, s.door_viol, s.n_labelings,\n"
-        "       v.hist_viol, l.n_docs\n"
-        "FROM hh h JOIN hx x ON x.r = h.nrb\n"
-        "CROSS JOIN sv s CROSS JOIN hv v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q708_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q708_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{hist}", _Q708_HIST))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q708_sperner_lemma",
-       "WITH " + _q708_join("documents", "//", " MATERIALIZED"))
-def q708(spark, sf_dir):
-    """Sperner's lemma verified at EVERY admissible labeling of
-    the side-4 triangulated triangle — 13824 labelings, 16
-    small triangles each, and the rainbow count is odd every
-    single time (Sperner 1928; the combinatorial lemma that
-    proves Brouwer's fixed-point theorem, Monsky's theorem,
-    and fair-division protocols — q698's Hex theorem is its
-    sibling via Gale).  The triangulation has 15 vertices: 3
-    corners labeled 0/1/2, nine boundary vertices constrained
-    to their edge's two corner labels (2^9 choices), three
-    interior vertices free (3^3) — the full 512 x 27 universe
-    materializes from corpus dims.  One projection computes,
-    per labeling, the number of RAINBOW triangles (all three
-    labels present, 16 distinctness checks) and the number of
-    bottom-edge DOORS (segments labeled {0,1}).  Certificates:
-    the rainbow count is ODD for all 13824 labelings
-    (sperner_viol == 0 — Sperner's lemma with no induction,
-    no path-following, just the whole universe checked), the
-    door count is odd too (door_viol == 0 — the 1-D Sperner
-    lemma that seeds the classical induction, verified
-    independently), and the full rainbow census lands on the
-    pinned 2920/6192/3840/848/24 over values 1/3/5/7/9 — the
-    24 labelings achieving NINE rainbow triangles are the
-    maximally-mixed ones, and no labeling achieves more than
-    9 of 16.  Scale: one 13824-row projection and a census;
-    pure codegen."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q708_documents")
-    parts, fin = _q708_sql("q708_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q708_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{hist}", _Q708_HIST))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d32", "d16", "d27", "hx", "lb", "rb"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q708_{nm}",
-                      max_rows=15000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q709: Birkhoff–von Neumann — a doubly stochastic matrix
-# decomposed into permutation matrices, every step certified
-
-
-_Q709_P6 = '(0, 0, 1, 2), (1, 0, 2, 1), (2, 1, 0, 2), (3, 1, 2, 0), (4, 2, 0, 1), (5, 2, 1, 0)'
-
-
-def _q709_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"i3 AS (SELECT DISTINCT CAST(doc_id % 3 AS BIGINT)"
-        f" AS i FROM {tbl})",
-        "p6 AS (SELECT CAST(pid AS BIGINT) AS pid, CAST(p0 AS"
-        " BIGINT) AS p0,\n"
-        "           CAST(p1 AS BIGINT) AS p1, CAST(p2 AS"
-        " BIGINT) AS p2\n"
-        "         FROM (VALUES {p6}) t(pid, p0, p1, p2))",
-        # corpus fixture: entries from residue sums, all row and
-        # column sums exactly 12 by construction
-        f"ab AS (SELECT\n"
-        f"           max(CASE WHEN cls = 0 THEN v END) AS a,\n"
-        f"           max(CASE WHEN cls = 1 THEN v END) AS b,\n"
-        f"           max(CASE WHEN cls = 2 THEN v END) AS c,\n"
-        f"           max(CASE WHEN cls = 3 THEN v END) AS e\n"
-        f"         FROM (SELECT doc_id % 4 AS cls,\n"
-        f"             CAST(sum(n_chars) % 4 + 3 AS BIGINT)"
-        f" AS v\n"
-        f"           FROM {tbl} GROUP BY doc_id % 4) t)",
-        "m0 AS{mat} (SELECT x.i, y.i AS j, CAST(CASE\n"
-        "           WHEN x.i = 0 AND y.i = 0 THEN w.a\n"
-        "           WHEN x.i = 0 AND y.i = 1 THEN w.b\n"
-        "           WHEN x.i = 0 AND y.i = 2 THEN 12 - w.a -"
-        " w.b\n"
-        "           WHEN x.i = 1 AND y.i = 0 THEN w.c\n"
-        "           WHEN x.i = 1 AND y.i = 1 THEN w.e\n"
-        "           WHEN x.i = 1 AND y.i = 2 THEN 12 - w.c -"
-        " w.e\n"
-        "           WHEN x.i = 2 AND y.i = 0 THEN 12 - w.a -"
-        " w.c\n"
-        "           WHEN x.i = 2 AND y.i = 1 THEN 12 - w.b -"
-        " w.e\n"
-        "           ELSE w.a + w.b + w.c + w.e - 12 END AS"
-        " BIGINT) AS v\n"
-        "         FROM i3 x CROSS JOIN i3 y CROSS JOIN ab w)",
-        # doubly-stochastic certificate on the input
-        "dsv AS (SELECT CAST(\n"
-        "           (SELECT sum(CASE WHEN t.s <> 12 THEN 1"
-        " ELSE 0 END)\n"
-        "             FROM (SELECT i, sum(v) AS s FROM m0"
-        " GROUP BY i) t)\n"
-        "           + (SELECT sum(CASE WHEN t.s <> 12 THEN 1"
-        " ELSE 0 END)\n"
-        "             FROM (SELECT j, sum(v) AS s FROM m0"
-        " GROUP BY j) t)\n"
-        "           + (SELECT sum(CASE WHEN v < 0 THEN 1"
-        " ELSE 0 END)\n"
-        "             FROM m0) AS BIGINT) AS input_viol)",
-    ]
-    for k in range(1, 6):
-        p = f"m{k - 1}"
-        parts += [
-            f"fz{k} AS{{mat}} (SELECT p.pid, p.p0, p.p1, p.p2,\n"
-            f"           min(m.v) AS mn\n"
-            f"         FROM p6 p JOIN {p} m ON\n"
-            f"           (m.i = 0 AND m.j = p.p0) OR\n"
-            f"           (m.i = 1 AND m.j = p.p1) OR\n"
-            f"           (m.i = 2 AND m.j = p.p2)\n"
-            f"         GROUP BY p.pid, p.p0, p.p1, p.p2)",
-            f"ws{k} AS{{mat}} (SELECT c.pid, c.tot,\n"
-            f"           coalesce(f.mn, 0) AS w,\n"
-            f"           f.p0, f.p1, f.p2\n"
-            f"         FROM (SELECT coalesce(min(CASE WHEN"
-            f" mn >= 1\n"
-            f"             THEN pid END), -1) AS pid,\n"
-            f"             (SELECT sum(v) FROM {p}) AS tot\n"
-            f"           FROM fz{k}) c\n"
-            f"         LEFT JOIN fz{k} f ON f.pid = c.pid)",
-            f"m{k} AS{{mat}} (SELECT m.i, m.j,\n"
-            f"           m.v - CASE WHEN w.pid >= 0 AND m.j =\n"
-            f"             (CASE m.i WHEN 0 THEN w.p0 WHEN 1"
-            f" THEN w.p1\n"
-            f"               ELSE w.p2 END) THEN w.w ELSE 0"
-            f" END AS v\n"
-            f"         FROM {p} m CROSS JOIN ws{k} w)",
-        ]
-    parts += [
-        # the step log and its certificates
-        "lg AS{mat} (" + "\n         UNION ALL ".join(
-            f"SELECT {k} AS stp, pid, w, p0, p1, p2, tot"
-            f" FROM ws{k}" for k in range(1, 6)) + ")",
-        "hv AS (SELECT CAST(sum(CASE WHEN tot >= 1 AND"
-        " pid = -1\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " hall_viol,\n"
-        "           CAST(sum(CASE WHEN pid >= 0 AND w >= 1"
-        " THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS n_perms\n"
-        "         FROM lg)",
-        "tv AS (SELECT CAST(sum(CASE WHEN v <> 0 THEN 1 ELSE 0"
-        " END)\n"
-        "           AS BIGINT) AS term_viol FROM m5)",
-        "nn AS (SELECT CAST(" + " + ".join(
-            f"(SELECT sum(CASE WHEN v < 0 THEN 1 ELSE 0 END)"
-            f" FROM m{k})" for k in range(1, 6))
-        + " AS BIGINT) AS nonneg_viol)",
-        # reconstruction: sum of w_k P_k equals the input matrix
-        "rc AS (SELECT CAST(sum(CASE WHEN t.s <> m.v THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS recon_viol\n"
-        "         FROM m0 m JOIN (SELECT c.i, c.j,\n"
-        "             sum(CASE WHEN g.pid >= 0 AND c.j =\n"
-        "               (CASE c.i WHEN 0 THEN g.p0 WHEN 1 THEN"
-        " g.p1\n"
-        "                 ELSE g.p2 END) THEN g.w ELSE 0 END)"
-        " AS s\n"
-        "           FROM m0 c CROSS JOIN lg g\n"
-        "           GROUP BY c.i, c.j) t\n"
-        "           ON t.i = m.i AND t.j = m.j)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT m.i, m.j, m.v AS m_v,\n"
-        "       v.input_viol, h.hall_viol, h.n_perms,\n"
-        "       t.term_viol, n.nonneg_viol, r.recon_viol,\n"
-        "       l.n_docs\n"
-        "FROM m0 m CROSS JOIN dsv v CROSS JOIN hv h\n"
-        "CROSS JOIN tv t CROSS JOIN nn n CROSS JOIN rc r\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q709_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q709_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{p6}", _Q709_P6))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q709_birkhoff_von_neumann",
-       "WITH " + _q709_join("documents", "//", " MATERIALIZED"))
-def q709(spark, sf_dir):
-    """Birkhoff–von Neumann decomposition — a corpus-derived
-    doubly stochastic matrix written as a positive combination
-    of permutation matrices, with every step of the greedy
-    certified (Birkhoff 1946, von Neumann 1953; the extreme
-    points of the doubly stochastic polytope are EXACTLY the
-    permutation matrices, which is why round-robin schedulers,
-    switch fabrics, and fair-assignment lotteries decompose
-    their rate matrices this way).  The 3x3 input derives from
-    four corpus residue sums with every row and column summing
-    to exactly 12 by construction — certified, not assumed
-    (input_viol == 0, nonnegativity included).  Five greedy
-    rounds: each finds the lexicographically least permutation
-    whose three matched entries are all positive (a relational
-    min over the 6-perm dim), subtracts its bottleneck weight,
-    and logs (perm, weight).  Certificates: a positive-support
-    permutation EXISTS whenever the matrix is nonzero
-    (hall_viol == 0 — the Hall/Konig step that powers
-    Birkhoff's induction), entries never go negative
-    (nonneg_viol == 0), the matrix reaches EXACTLY zero within
-    five rounds (term_viol == 0 — Marcus's n^2 - 2n + 2 = 5
-    bound attained as a termination certificate), and the
-    logged combination reconstructs the input entrywise:
-    sum w_k P_k = M exactly (recon_viol == 0).  The emitted
-    n_perms says how many permutation matrices this particular
-    corpus matrix needed.  Scale: five dim-sized rounds; the
-    certificate cost is fixed."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q709_documents")
-    parts, fin = _q709_sql("q709_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q709_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{p6}", _Q709_P6))
-        nm = fr.split(" AS ", 1)[0].strip()
-        pin = (nm in ("i3", "p6", "ab", "m0", "lg")
-               or (nm[:2] in ("fz", "ws") and
-                   nm[2:].isdigit())
-               or (nm[0] == "m" and nm[1:].isdigit()))
-        if pin:
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q709_{nm}",
-                      max_rows=100)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q710: Nash equilibria of the five classic 2x2 games — support
-# enumeration in exact rationals, oddness, dominance, zero-sum
-
-
-_Q710_GM = '(0, 0, 0, 3, 3), (0, 0, 1, 0, 5), (0, 1, 0, 5, 0), (0, 1, 1, 1, 1), (1, 0, 0, 3, 2), (1, 0, 1, 0, 0), (1, 1, 0, 0, 0), (1, 1, 1, 2, 3), (2, 0, 0, 1, -1), (2, 0, 1, -1, 1), (2, 1, 0, -1, 1), (2, 1, 1, 1, -1), (3, 0, 0, 0, 0), (3, 0, 1, -1, 1), (3, 1, 0, 1, -1), (3, 1, 1, -9, -9), (4, 0, 0, 4, 4), (4, 0, 1, 0, 3), (4, 1, 0, 3, 0), (4, 1, 1, 3, 3)'
-_Q710_NE = '(0, 1), (1, 3), (2, 1), (3, 3), (4, 3)'
-
-
-def _q710_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "gm AS (SELECT CAST(g AS BIGINT) AS g, CAST(i AS"
-        " BIGINT) AS i,\n"
-        "           CAST(j AS BIGINT) AS j, CAST(av AS BIGINT)"
-        " AS av,\n"
-        "           CAST(bv AS BIGINT) AS bv FROM (VALUES {gm})"
-        " t(g, i, j, av, bv))",
-        "ne AS (SELECT CAST(g AS BIGINT) AS g, CAST(n AS"
-        " BIGINT) AS n\n"
-        "         FROM (VALUES {ne}) t(g, n))",
-        # pivot the payoff matrices to scalars per game
-        "gp AS{mat} (SELECT g,\n"
-        "           max(CASE WHEN i = 0 AND j = 0 THEN av END)"
-        " AS a00,\n"
-        "           max(CASE WHEN i = 0 AND j = 1 THEN av END)"
-        " AS a01,\n"
-        "           max(CASE WHEN i = 1 AND j = 0 THEN av END)"
-        " AS a10,\n"
-        "           max(CASE WHEN i = 1 AND j = 1 THEN av END)"
-        " AS a11,\n"
-        "           max(CASE WHEN i = 0 AND j = 0 THEN bv END)"
-        " AS b00,\n"
-        "           max(CASE WHEN i = 0 AND j = 1 THEN bv END)"
-        " AS b01,\n"
-        "           max(CASE WHEN i = 1 AND j = 0 THEN bv END)"
-        " AS b10,\n"
-        "           max(CASE WHEN i = 1 AND j = 1 THEN bv END)"
-        " AS b11\n"
-        "         FROM gm GROUP BY g)",
-        # pure equilibria by best-response checks
-        "pe AS{mat} (SELECT a.g, a.i, a.j FROM gm a\n"
-        "         JOIN gm r ON r.g = a.g AND r.i = 1 - a.i AND"
-        " r.j = a.j\n"
-        "         JOIN gm c ON c.g = a.g AND c.i = a.i AND\n"
-        "           c.j = 1 - a.j\n"
-        "         WHERE a.av >= r.av AND a.bv >= c.bv)",
-        # interior mixed equilibrium: p from B's indifference,
-        # q from A's; interior iff 0 < num/den < 1 (sign-safe)
-        "mx AS{mat} (SELECT g,\n"
-        "           b11 - b10 AS pn, b00 - b01 - b10 + b11 AS"
-        " pd2,\n"
-        "           a11 - a01 AS qn, a00 - a10 - a01 + a11 AS"
-        " qd2,\n"
-        "           CASE WHEN (b00 - b01 - b10 + b11 > 0 AND\n"
-        "             b11 - b10 > 0 AND b11 - b10 < b00 - b01"
-        " - b10 + b11)\n"
-        "             OR (b00 - b01 - b10 + b11 < 0 AND\n"
-        "             b11 - b10 < 0 AND b11 - b10 > b00 - b01"
-        " - b10 + b11)\n"
-        "             THEN 1 ELSE 0 END *\n"
-        "           CASE WHEN (a00 - a10 - a01 + a11 > 0 AND\n"
-        "             a11 - a01 > 0 AND a11 - a01 < a00 - a10"
-        " - a01 + a11)\n"
-        "             OR (a00 - a10 - a01 + a11 < 0 AND\n"
-        "             a11 - a01 < 0 AND a11 - a01 > a00 - a10"
-        " - a01 + a11)\n"
-        "             THEN 1 ELSE 0 END AS interior\n"
-        "         FROM gp)",
-        # indifference certificate: at q the row player's two
-        # rows pay equally (cross-multiplied by qd2), dually at p
-        "iv AS (SELECT CAST(sum(CASE WHEN m.interior = 1 AND\n"
-        "           (m.qn*p2.a00 + (m.qd2 - m.qn)*p2.a01) <>\n"
-        "           (m.qn*p2.a10 + (m.qd2 - m.qn)*p2.a11)"
-        " THEN 1\n"
-        "           ELSE 0 END)\n"
-        "           + sum(CASE WHEN m.interior = 1 AND\n"
-        "           (m.pn*p2.b00 + (m.pd2 - m.pn)*p2.b10) <>\n"
-        "           (m.pn*p2.b01 + (m.pd2 - m.pn)*p2.b11)"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS indiff_viol\n"
-        "         FROM mx m JOIN gp p2 ON p2.g = m.g)",
-        # equilibrium counts: pinned and ODD at every game
-        "ct AS{mat} (SELECT p2.g,\n"
-        "           coalesce(c.np, 0) + m.interior AS neq\n"
-        "         FROM gp p2\n"
-        "         LEFT JOIN (SELECT g, count(*) AS np FROM pe\n"
-        "           GROUP BY g) c ON c.g = p2.g\n"
-        "         JOIN mx m ON m.g = p2.g)",
-        "cv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN c.neq <> x.n THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS count_viol,\n"
-        "           CAST(sum(CASE WHEN c.neq % 2 = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "             AS BIGINT) AS odd_viol\n"
-        "         FROM ct c JOIN ne x ON x.g = c.g)",
-        # prisoner's dilemma: defect strictly dominates for both
-        "dv AS (SELECT CAST(CASE WHEN p2.a10 > p2.a00 AND\n"
-        "           p2.a11 > p2.a01 AND p2.b01 > p2.b00 AND\n"
-        "           p2.b11 > p2.b10 THEN 0 ELSE 1 END AS"
-        " BIGINT)\n"
-        "           AS dom_viol FROM gp p2 WHERE p2.g = 0)",
-        # matching pennies: zero-sum cellwise, mixed value 0
-        "zv AS (SELECT CAST(\n"
-        "           (SELECT sum(CASE WHEN av + bv <> 0 THEN 1\n"
-        "             ELSE 0 END) FROM gm WHERE g = 2)\n"
-        "           + (SELECT CASE WHEN m.qn*p2.a00 +\n"
-        "             (m.qd2 - m.qn)*p2.a01 <> 0 THEN 1 ELSE 0"
-        " END\n"
-        "             FROM mx m JOIN gp p2 ON p2.g = m.g\n"
-        "             WHERE m.g = 2) AS BIGINT) AS"
-        " zerosum_viol)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT c.g, c.neq, m.interior, m.pn, m.pd2, m.qn,\n"
-        "       m.qd2, v.count_viol, v.odd_viol,\n"
-        "       i.indiff_viol, d2.dom_viol, z.zerosum_viol,\n"
-        "       l.n_docs\n"
-        "FROM ct c JOIN mx m ON m.g = c.g\n"
-        "CROSS JOIN cv v CROSS JOIN iv i CROSS JOIN dv d2\n"
-        "CROSS JOIN zv z CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q710_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q710_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{gm}", _Q710_GM).replace("{ne}",
-                                                _Q710_NE))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q710_nash_2x2",
-       "WITH " + _q710_join("documents", "//", " MATERIALIZED"))
-def q710(spark, sf_dir):
-    """Nash equilibria of the five classic 2x2 games by support
-    enumeration in exact rationals — every equilibrium found,
-    counted, and certified (Nash 1950; prisoner's dilemma,
-    battle of the sexes, matching pennies, chicken, and stag
-    hunt are the five personalities of strategic interaction,
-    and their equilibrium structure is the syllabus of game
-    theory).  Pure equilibria come from relational
-    best-response checks (a cell where neither player gains by
-    deviating); the interior mixed equilibrium comes from the
-    OPPONENT's indifference — p = (B11-B10)/(B00-B01-B10+B11),
-    q likewise from A — kept as exact integer fractions with a
-    sign-safe interiority test, and certified by the defining
-    property: at q the row player's two rows pay EXACTLY
-    equally, at p the column player's two columns do
-    (indiff_viol == 0, cross-multiplied).  The counts land on
-    the pinned 1/3/1/3/3 (count_viol == 0) and every game has
-    an ODD number of equilibria (odd_viol == 0 — Wilson's
-    oddness theorem on these nondegenerate games, the
-    index-theory shadow).  Prisoner's dilemma is certified
-    dominance-solvable (defect strictly dominates for BOTH
-    players, dom_viol == 0 — why its unique equilibrium is
-    Pareto-dominated), and matching pennies is certified
-    zero-sum cellwise with mixed value exactly 0
-    (zerosum_viol == 0 — the minimax connection, q620's
-    duality in 2x2 form).  Scale: dim algebra on a 20-row
-    payoff table; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q710_documents")
-    parts, fin = _q710_sql("q710_documents", "div", "")
-    kept = [fr.replace("{mat}", "").replace("{d}", "div")
-            .replace("{gm}", _Q710_GM).replace("{ne}", _Q710_NE)
-            for fr in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q711: May's theorem — majority rule characterized by total
-# exhaustion over all 6561 social choice functions
-
-
-_Q711_PF = '(0, -3), (1, -1), (2, -1), (3, 1), (4, -1), (5, 1), (6, 1), (7, 3)'
-_Q711_NEG = '(0, 7), (1, 6), (2, 5), (3, 4), (4, 3), (5, 2), (6, 1), (7, 0)'
-_Q711_EQS = '(1, 2), (1, 4), (2, 4), (3, 5), (3, 6), (5, 6)'
-_Q711_DOM = '(0, 1), (0, 2), (0, 3), (0, 4), (0, 5), (0, 6), (0, 7), (1, 3), (1, 5), (1, 7), (2, 3), (2, 6), (2, 7), (3, 7), (4, 5), (4, 6), (4, 7), (5, 7), (6, 7)'
-
-
-def _q711_sql(tbl: str, d: str, mat: str):
-    def digit(i: str) -> str:
-        return (f"((f.code {{d}} (CASE {i} WHEN 0 THEN 1 WHEN 1"
-                f" THEN 3 WHEN 2 THEN 9 WHEN 3 THEN 27 WHEN 4"
-                f" THEN 81 WHEN 5 THEN 243 WHEN 6 THEN 729 ELSE"
-                f" 2187 END)) % 3 - 1)")
-    parts = [
-        f"d81 AS (SELECT DISTINCT CAST(doc_id % 81 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        "pf AS (SELECT CAST(i AS BIGINT) AS i, CAST(s AS"
-        " BIGINT) AS s\n"
-        "         FROM (VALUES {pf}) t(i, s))",
-        "ng AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        " BIGINT) AS j\n"
-        "         FROM (VALUES {neg}) t(i, j))",
-        "eq AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        " BIGINT) AS j\n"
-        "         FROM (VALUES {eqs}) t(i, j))",
-        "dm AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        " BIGINT) AS j\n"
-        "         FROM (VALUES {dom}) t(i, j))",
-        "fc AS{mat} (SELECT hi.a*81 + lo.a AS code\n"
-        "         FROM d81 hi CROSS JOIN d81 lo)",
-        # the three axioms, each a per-function violation count
-        "ax AS{mat} (SELECT f.code,\n"
-        "           (SELECT count(*) FROM eq e WHERE\n"
-        "             " + digit("e.i") + " <> " + digit("e.j")
-        + ") AS anon,\n"
-        "           (SELECT count(*) FROM ng e WHERE\n"
-        "             " + digit("e.i") + " + " + digit("e.j")
-        + " <> 0) AS neut,\n"
-        "           (SELECT count(*) FROM dm e WHERE\n"
-        "             " + digit("e.i") + " >= 0 AND "
-        + digit("e.j") + " <> 1) AS posr\n"
-        "         FROM fc f)",
-        "sv AS{mat} (SELECT code FROM ax\n"
-        "         WHERE anon = 0 AND neut = 0 AND posr = 0)",
-        "nv AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " n_survivors,\n"
-        "           CAST(max(code) AS BIGINT) AS winner\n"
-        "         FROM sv)",
-        # the survivor must BE majority rule: output sign(sum)
-        # at every profile
-        "mj AS (SELECT CAST(sum(CASE WHEN\n"
-        "           ((s.winner {d} (CASE p.i WHEN 0 THEN 1"
-        " WHEN 1\n"
-        "             THEN 3 WHEN 2 THEN 9 WHEN 3 THEN 27"
-        " WHEN 4\n"
-        "             THEN 81 WHEN 5 THEN 243 WHEN 6 THEN 729\n"
-        "             ELSE 2187 END)) % 3 - 1) <>\n"
-        "           CASE WHEN p.s > 0 THEN 1 ELSE -1 END\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS maj_viol\n"
-        "         FROM pf p CROSS JOIN nv s)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT p.i, p.s AS vote_sum,\n"
-        "       CASE WHEN p.s > 0 THEN 1 ELSE -1 END AS"
-        " majority_out,\n"
-        "       n.n_survivors, n.winner, m.maj_viol,"
-        " l.n_docs\n"
-        "FROM pf p CROSS JOIN nv n CROSS JOIN mj m\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q711_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q711_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{pf}", _Q711_PF).replace("{neg}",
-                                                _Q711_NEG)
-             .replace("{eqs}", _Q711_EQS).replace("{dom}",
-                                                  _Q711_DOM))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q711_may_theorem",
-       "WITH " + _q711_join("documents", "//", " MATERIALIZED"))
-def q711(spark, sf_dir):
-    """May's theorem by total exhaustion — among ALL 6561
-    social choice functions on three voters and two
-    alternatives, exactly one satisfies anonymity, neutrality,
-    and positive responsiveness: majority rule (May 1952; the
-    axiomatic foundation of simple majority voting, and the
-    two-alternative counterpoint to Arrow — with two options
-    the axioms CHARACTERIZE rather than annihilate).  A social
-    choice function maps each of the 8 vote profiles to
-    {-1, 0, +1}; all 3^8 = 6561 functions materialize as
-    base-3 codes from two 81-value corpus dims, outputs read
-    off by CASE-dispatched digit extraction.  Each axiom is a
-    per-function violation count over a Python-precomputed
-    pair dim: ANONYMITY — profiles with equal vote sums get
-    equal outputs (6 pairs); NEUTRALITY — negating every vote
-    negates the output (8 pairs, which also forces ties to 0);
-    POSITIVE RESPONSIVENESS — if some voter switches upward
-    from a profile with outcome >= 0, the outcome becomes
-    strictly +1 (19 ordered dominance pairs).  The sift leaves
-    n_survivors == 1, and that survivor is verified to BE
-    majority rule — output sign(vote sum) at every profile
-    (maj_viol == 0).  One theorem, zero citations: the
-    characterization holds because every one of the other
-    6560 functions concretely fails an axiom.  Scale: a
-    6561-row sift with dim-sized subquery counts."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q711_documents")
-    parts, fin = _q711_sql("q711_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q711_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{pf}", _Q711_PF).replace("{neg}",
-                                                 _Q711_NEG)
-              .replace("{eqs}", _Q711_EQS).replace("{dom}",
-                                                   _Q711_DOM))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d81", "pf", "ng", "eq", "dm", "fc", "ax",
-                  "sv"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q711_{nm}",
-                      max_rows=7000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q712: Erdos–Gallai — graphical degree sequences characterized
-# by exhaustion against the whole 5-vertex graph universe
-
-
-def _q712_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"g32 AS (SELECT DISTINCT CAST(doc_id % 32 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"e5 AS (SELECT DISTINCT CAST(doc_id % 5 AS BIGINT)"
-        f" AS e FROM {tbl})",
-        "gm AS{mat} (SELECT hi.b*32 + lo.b AS m\n"
-        "         FROM g32 hi CROSS JOIN g32 lo)",
-        "dg AS{mat} (SELECT m, (((m {d} 1) % 2) + ((m {d} 2) % 2) + ((m {d} 4) % 2) + ((m {d} 8) % 2)) AS d0, (((m {d} 1) % 2) + ((m {d} 16) % 2) + ((m {d} 32) % 2) + ((m {d} 64) % 2)) AS"
-        " d1,\n"
-        "           (((m {d} 2) % 2) + ((m {d} 16) % 2) + ((m {d} 128) % 2) + ((m {d} 256) % 2)) AS d2, (((m {d} 4) % 2) + ((m {d} 32) % 2) + ((m {d} 128) % 2) + ((m {d} 512) % 2)) AS d3, (((m {d} 8) % 2) + ((m {d} 64) % 2) + ((m {d} 256) % 2) + ((m {d} 512) % 2))"
-        " AS d4\n"
-        "         FROM gm)",
-    ]
-    # 9-comparator sorting network: descending sort of d0..d4
-    prev = "dg"
-    for s, (a, b) in enumerate([(0, 1), (3, 4), (2, 4), (2, 3), (1, 4), (0, 3), (0, 2), (1, 3), (1, 2)]):
-        cols = []
-        for c in range(5):
-            if c == a:
-                cols.append(f"greatest(d{a}, d{b}) AS d{a}")
-            elif c == b:
-                cols.append(f"least(d{a}, d{b}) AS d{b}")
-            else:
-                cols.append(f"d{c}")
-        parts.append(
-            f"n{s} AS{{mat}} (SELECT m, " + ", ".join(cols)
-            + f" FROM {prev})")
-        prev = f"n{s}"
-    parts += [
-        "rz AS{mat} (SELECT DISTINCT d0, d1, d2, d3, d4"
-        " FROM n8)",
-        # all 126 descending candidate sequences
-        "ds AS{mat} (SELECT a.e AS d0, b.e AS d1, c.e AS d2,\n"
-        "           x.e AS d3, y.e AS d4\n"
-        "         FROM e5 a JOIN e5 b ON b.e <= a.e\n"
-        "         JOIN e5 c ON c.e <= b.e\n"
-        "         JOIN e5 x ON x.e <= c.e\n"
-        "         JOIN e5 y ON y.e <= x.e)",
-        # the Erdos–Gallai predicate, all five k plus parity
-        "eg AS{mat} (SELECT s.*, CASE WHEN\n"
-        "           (s.d0 + s.d1 + s.d2 + s.d3 + s.d4) % 2 ="
-        " 0\n"
-        "           AND s.d0 <= 0 + least(s.d1, 1) +"
-        " least(s.d2, 1)\n"
-        "             + least(s.d3, 1) + least(s.d4, 1)\n"
-        "           AND s.d0 + s.d1 <= 2 + least(s.d2, 2)\n"
-        "             + least(s.d3, 2) + least(s.d4, 2)\n"
-        "           AND s.d0 + s.d1 + s.d2 <= 6 + least(s.d3,"
-        " 3)\n"
-        "             + least(s.d4, 3)\n"
-        "           AND s.d0 + s.d1 + s.d2 + s.d3 <= 12 +\n"
-        "             least(s.d4, 4)\n"
-        "           AND s.d0 + s.d1 + s.d2 + s.d3 + s.d4 <="
-        " 20\n"
-        "           THEN 1 ELSE 0 END AS egok\n"
-        "         FROM ds s)",
-        "fv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN e.egok <> CASE WHEN"
-        " r.d0 IS\n"
-        "             NULL THEN 0 ELSE 1 END THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS iff_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_seq,\n"
-        "           CAST(sum(e.egok) AS BIGINT) AS"
-        " n_graphical\n"
-        "         FROM eg e LEFT JOIN rz r ON r.d0 = e.d0 AND\n"
-        "           r.d1 = e.d1 AND r.d2 = e.d2 AND"
-        " r.d3 = e.d3\n"
-        "           AND r.d4 = e.d4)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT e.d0, e.d1, e.d2, e.d3, e.d4, e.egok AS"
-        " graphical,\n"
-        "       f.iff_viol, f.n_seq, f.n_graphical, l.n_docs\n"
-        "FROM eg e CROSS JOIN fv f CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q712_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q712_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q712_erdos_gallai",
-       "WITH " + _q712_join("documents", "//", " MATERIALIZED"))
-def q712(spark, sf_dir):
-    """Erdos–Gallai's characterization of graphical degree
-    sequences, proven as an iff by exhaustion against the
-    entire 5-vertex graph universe (Erdos & Gallai 1960; the
-    answer to 'can these degrees be a graph?' that underlies
-    degree-preserving network null models and graph
-    realizability checks).  One side: every one of the 1024
-    graphs yields its degree multiset, sorted DESCENDING by a
-    9-comparator sorting network run as staged min/max
-    projections (q619's machinery as a pipeline), and the
-    distinct sorted tuples form the realizable set — exactly
-    31 of the 126 candidate descending sequences.  Other side:
-    the Erdos–Gallai predicate — even degree sum plus the five
-    inequalities sum_{i<=k} d_i <= k(k-1) + sum_{i>k}
-    min(d_i, k) — computes as pure column arithmetic on all
-    126 candidates.  The certificate is the genuine IFF: the
-    predicate is true EXACTLY on the realizable set, both
-    containments over every sequence (iff_viol == 0) — every
-    EG-passing sequence has a witness graph somewhere in the
-    1024, and every EG-failing sequence is realized by none of
-    them.  The handshake parity condition sits inside the
-    predicate and is exercised by the 63 odd-sum candidates,
-    all unrealizable.  Scale: a 1024-row degree scan, a
-    9-stage sorting network, and a 126-row predicate — the
-    exhaustive side costs one distinct over the universe."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q712_documents")
-    parts, fin = _q712_sql("q712_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q712_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("g32", "e5", "gm", "dg", "rz", "ds", "eg") \
-                or (nm[0] == "n" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q712_{nm}",
-                      max_rows=2000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q713: tournaments — Redei's odd Hamiltonian-path theorem and
-# Landau's kings, by total 1024-tournament exhaustion
-
-
-_Q713_HIST = '(1, 120), (3, 120), (5, 240), (9, 240), (11, 120), (13, 120), (15, 64)'
-
-
-def _q713_sql(tbl: str, d: str, mat: str):
-    perm_chain = "FROM e5 a1"
-    for i in range(2, 6):
-        conds = " AND ".join(f"a{i}.e <> a{j}.e"
-                             for j in range(1, i))
-        perm_chain += f"\n         JOIN e5 a{i} ON {conds}"
-    cols = ", ".join(f"a{i}.e AS v{i}" for i in range(1, 6))
-    parts = [
-        f"g32 AS (SELECT DISTINCT CAST(doc_id % 32 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"e5 AS (SELECT DISTINCT CAST(doc_id % 5 AS BIGINT)"
-        f" AS e FROM {tbl})",
-        "hx AS (SELECT CAST(h AS BIGINT) AS h, CAST(n AS"
-        " BIGINT) AS n\n"
-        "         FROM (VALUES {hist}) t(h, n))",
-        "tm AS{mat} (SELECT hi.b*32 + lo.b AS m\n"
-        "         FROM g32 hi CROSS JOIN g32 lo)",
-        "pm AS{mat} (SELECT " + cols + "\n         "
-        + perm_chain + ")",
-        # Hamiltonian-path census: 1024 x 120 path checks
-        "hp AS{mat} (SELECT t.m, CAST(sum(CASE WHEN\n"
-        "           (CASE WHEN p.v1 = 0 AND p.v2 = 1 THEN ((t.m {d} 1) % 2) WHEN p.v1 = 1 AND p.v2 = 0 THEN (1 - ((t.m {d} 1) % 2)) WHEN p.v1 = 0 AND p.v2 = 2 THEN ((t.m {d} 2) % 2) WHEN p.v1 = 2 AND p.v2 = 0 THEN (1 - ((t.m {d} 2) % 2)) WHEN p.v1 = 0 AND p.v2 = 3 THEN ((t.m {d} 4) % 2) WHEN p.v1 = 3 AND p.v2 = 0 THEN (1 - ((t.m {d} 4) % 2)) WHEN p.v1 = 0 AND p.v2 = 4 THEN ((t.m {d} 8) % 2) WHEN p.v1 = 4 AND p.v2 = 0 THEN (1 - ((t.m {d} 8) % 2)) WHEN p.v1 = 1 AND p.v2 = 2 THEN ((t.m {d} 16) % 2) WHEN p.v1 = 2 AND p.v2 = 1 THEN (1 - ((t.m {d} 16) % 2)) WHEN p.v1 = 1 AND p.v2 = 3 THEN ((t.m {d} 32) % 2) WHEN p.v1 = 3 AND p.v2 = 1 THEN (1 - ((t.m {d} 32) % 2)) WHEN p.v1 = 1 AND p.v2 = 4 THEN ((t.m {d} 64) % 2) WHEN p.v1 = 4 AND p.v2 = 1 THEN (1 - ((t.m {d} 64) % 2)) WHEN p.v1 = 2 AND p.v2 = 3 THEN ((t.m {d} 128) % 2) WHEN p.v1 = 3 AND p.v2 = 2 THEN (1 - ((t.m {d} 128) % 2)) WHEN p.v1 = 2 AND p.v2 = 4 THEN ((t.m {d} 256) % 2) WHEN p.v1 = 4 AND p.v2 = 2 THEN (1 - ((t.m {d} 256) % 2)) WHEN p.v1 = 3 AND p.v2 = 4 THEN ((t.m {d} 512) % 2) WHEN p.v1 = 4 AND p.v2 = 3 THEN (1 - ((t.m {d} 512) % 2)) END) + (CASE WHEN p.v2 = 0 AND p.v3 = 1 THEN ((t.m {d} 1) % 2) WHEN p.v2 = 1 AND p.v3 = 0 THEN (1 - ((t.m {d} 1) % 2)) WHEN p.v2 = 0 AND p.v3 = 2 THEN ((t.m {d} 2) % 2) WHEN p.v2 = 2 AND p.v3 = 0 THEN (1 - ((t.m {d} 2) % 2)) WHEN p.v2 = 0 AND p.v3 = 3 THEN ((t.m {d} 4) % 2) WHEN p.v2 = 3 AND p.v3 = 0 THEN (1 - ((t.m {d} 4) % 2)) WHEN p.v2 = 0 AND p.v3 = 4 THEN ((t.m {d} 8) % 2) WHEN p.v2 = 4 AND p.v3 = 0 THEN (1 - ((t.m {d} 8) % 2)) WHEN p.v2 = 1 AND p.v3 = 2 THEN ((t.m {d} 16) % 2) WHEN p.v2 = 2 AND p.v3 = 1 THEN (1 - ((t.m {d} 16) % 2)) WHEN p.v2 = 1 AND p.v3 = 3 THEN ((t.m {d} 32) % 2) WHEN p.v2 = 3 AND p.v3 = 1 THEN (1 - ((t.m {d} 32) % 2)) WHEN p.v2 = 1 AND p.v3 = 4 THEN ((t.m {d} 64) % 2) WHEN p.v2 = 4 AND p.v3 = 1 THEN (1 - ((t.m {d} 64) % 2)) WHEN p.v2 = 2 AND p.v3 = 3 THEN ((t.m {d} 128) % 2) WHEN p.v2 = 3 AND p.v3 = 2 THEN (1 - ((t.m {d} 128) % 2)) WHEN p.v2 = 2 AND p.v3 = 4 THEN ((t.m {d} 256) % 2) WHEN p.v2 = 4 AND p.v3 = 2 THEN (1 - ((t.m {d} 256) % 2)) WHEN p.v2 = 3 AND p.v3 = 4 THEN ((t.m {d} 512) % 2) WHEN p.v2 = 4 AND p.v3 = 3 THEN (1 - ((t.m {d} 512) % 2)) END) + (CASE WHEN p.v3 = 0 AND p.v4 = 1 THEN ((t.m {d} 1) % 2) WHEN p.v3 = 1 AND p.v4 = 0 THEN (1 - ((t.m {d} 1) % 2)) WHEN p.v3 = 0 AND p.v4 = 2 THEN ((t.m {d} 2) % 2) WHEN p.v3 = 2 AND p.v4 = 0 THEN (1 - ((t.m {d} 2) % 2)) WHEN p.v3 = 0 AND p.v4 = 3 THEN ((t.m {d} 4) % 2) WHEN p.v3 = 3 AND p.v4 = 0 THEN (1 - ((t.m {d} 4) % 2)) WHEN p.v3 = 0 AND p.v4 = 4 THEN ((t.m {d} 8) % 2) WHEN p.v3 = 4 AND p.v4 = 0 THEN (1 - ((t.m {d} 8) % 2)) WHEN p.v3 = 1 AND p.v4 = 2 THEN ((t.m {d} 16) % 2) WHEN p.v3 = 2 AND p.v4 = 1 THEN (1 - ((t.m {d} 16) % 2)) WHEN p.v3 = 1 AND p.v4 = 3 THEN ((t.m {d} 32) % 2) WHEN p.v3 = 3 AND p.v4 = 1 THEN (1 - ((t.m {d} 32) % 2)) WHEN p.v3 = 1 AND p.v4 = 4 THEN ((t.m {d} 64) % 2) WHEN p.v3 = 4 AND p.v4 = 1 THEN (1 - ((t.m {d} 64) % 2)) WHEN p.v3 = 2 AND p.v4 = 3 THEN ((t.m {d} 128) % 2) WHEN p.v3 = 3 AND p.v4 = 2 THEN (1 - ((t.m {d} 128) % 2)) WHEN p.v3 = 2 AND p.v4 = 4 THEN ((t.m {d} 256) % 2) WHEN p.v3 = 4 AND p.v4 = 2 THEN (1 - ((t.m {d} 256) % 2)) WHEN p.v3 = 3 AND p.v4 = 4 THEN ((t.m {d} 512) % 2) WHEN p.v3 = 4 AND p.v4 = 3 THEN (1 - ((t.m {d} 512) % 2)) END) + (CASE WHEN p.v4 = 0 AND p.v5 = 1 THEN ((t.m {d} 1) % 2) WHEN p.v4 = 1 AND p.v5 = 0 THEN (1 - ((t.m {d} 1) % 2)) WHEN p.v4 = 0 AND p.v5 = 2 THEN ((t.m {d} 2) % 2) WHEN p.v4 = 2 AND p.v5 = 0 THEN (1 - ((t.m {d} 2) % 2)) WHEN p.v4 = 0 AND p.v5 = 3 THEN ((t.m {d} 4) % 2) WHEN p.v4 = 3 AND p.v5 = 0 THEN (1 - ((t.m {d} 4) % 2)) WHEN p.v4 = 0 AND p.v5 = 4 THEN ((t.m {d} 8) % 2) WHEN p.v4 = 4 AND p.v5 = 0 THEN (1 - ((t.m {d} 8) % 2)) WHEN p.v4 = 1 AND p.v5 = 2 THEN ((t.m {d} 16) % 2) WHEN p.v4 = 2 AND p.v5 = 1 THEN (1 - ((t.m {d} 16) % 2)) WHEN p.v4 = 1 AND p.v5 = 3 THEN ((t.m {d} 32) % 2) WHEN p.v4 = 3 AND p.v5 = 1 THEN (1 - ((t.m {d} 32) % 2)) WHEN p.v4 = 1 AND p.v5 = 4 THEN ((t.m {d} 64) % 2) WHEN p.v4 = 4 AND p.v5 = 1 THEN (1 - ((t.m {d} 64) % 2)) WHEN p.v4 = 2 AND p.v5 = 3 THEN ((t.m {d} 128) % 2) WHEN p.v4 = 3 AND p.v5 = 2 THEN (1 - ((t.m {d} 128) % 2)) WHEN p.v4 = 2 AND p.v5 = 4 THEN ((t.m {d} 256) % 2) WHEN p.v4 = 4 AND p.v5 = 2 THEN (1 - ((t.m {d} 256) % 2)) WHEN p.v4 = 3 AND p.v5 = 4 THEN ((t.m {d} 512) % 2) WHEN p.v4 = 4 AND p.v5 = 3 THEN (1 - ((t.m {d} 512) % 2)) END) = 4 THEN 1 ELSE 0 END) AS BIGINT)"
-        " AS nhp\n"
-        "         FROM tm t CROSS JOIN pm p GROUP BY t.m)",
-        "rv AS (SELECT CAST(sum(CASE WHEN nhp % 2 = 0 THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS redei_viol\n"
-        "         FROM hp)",
-        "hh AS (SELECT nhp, CAST(count(*) AS BIGINT) AS n"
-        " FROM hp\n"
-        "         GROUP BY nhp)",
-        "hv AS (SELECT CAST(sum(CASE WHEN h.n <> coalesce(x.n,"
-        " -1)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " hist_viol\n"
-        "         FROM hh h LEFT JOIN hx x ON x.h = h.nhp)",
-        # the beats relation, directed
-        "bt AS{mat} (SELECT t.m, a.e AS a, b.e AS b FROM tm"
-        " t\n"
-        "         CROSS JOIN e5 a JOIN e5 b ON b.e <> a.e\n"
-        "         WHERE CASE WHEN a.e = 0 AND b.e = 1 THEN ((t.m {d} 1) % 2) WHEN a.e = 1 AND b.e = 0 THEN (1 - ((t.m {d} 1) % 2)) WHEN a.e = 0 AND b.e = 2 THEN ((t.m {d} 2) % 2) WHEN a.e = 2 AND b.e = 0 THEN (1 - ((t.m {d} 2) % 2)) WHEN a.e = 0 AND b.e = 3 THEN ((t.m {d} 4) % 2) WHEN a.e = 3 AND b.e = 0 THEN (1 - ((t.m {d} 4) % 2)) WHEN a.e = 0 AND b.e = 4 THEN ((t.m {d} 8) % 2) WHEN a.e = 4 AND b.e = 0 THEN (1 - ((t.m {d} 8) % 2)) WHEN a.e = 1 AND b.e = 2 THEN ((t.m {d} 16) % 2) WHEN a.e = 2 AND b.e = 1 THEN (1 - ((t.m {d} 16) % 2)) WHEN a.e = 1 AND b.e = 3 THEN ((t.m {d} 32) % 2) WHEN a.e = 3 AND b.e = 1 THEN (1 - ((t.m {d} 32) % 2)) WHEN a.e = 1 AND b.e = 4 THEN ((t.m {d} 64) % 2) WHEN a.e = 4 AND b.e = 1 THEN (1 - ((t.m {d} 64) % 2)) WHEN a.e = 2 AND b.e = 3 THEN ((t.m {d} 128) % 2) WHEN a.e = 3 AND b.e = 2 THEN (1 - ((t.m {d} 128) % 2)) WHEN a.e = 2 AND b.e = 4 THEN ((t.m {d} 256) % 2) WHEN a.e = 4 AND b.e = 2 THEN (1 - ((t.m {d} 256) % 2)) WHEN a.e = 3 AND b.e = 4 THEN ((t.m {d} 512) % 2) WHEN a.e = 4 AND b.e = 3 THEN (1 - ((t.m {d} 512) % 2)) END = 1)",
-        # kings: reach every other vertex in at most two steps
-        "kg AS{mat} (SELECT r.m, r.a, CASE WHEN count(*) = 4\n"
-        "           THEN 1 ELSE 0 END AS king FROM (\n"
-        "           SELECT DISTINCT d1.m, d1.a, d1.b FROM bt"
-        " d1\n"
-        "           UNION SELECT d1.m, d1.a, d2.b FROM bt d1\n"
-        "           JOIN bt d2 ON d2.m = d1.m AND"
-        " d2.a = d1.b\n"
-        "             AND d2.b <> d1.a) r\n"
-        "         GROUP BY r.m, r.a)",
-        "kv AS (SELECT CAST(sum(CASE WHEN t.nk < 1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS king_viol FROM (\n"
-        "           SELECT m, sum(king) AS nk FROM kg"
-        " GROUP BY m) t)",
-        # Landau: every top-score vertex is a king
-        "sc AS{mat} (SELECT m, a, CAST(count(*) AS BIGINT) AS"
-        " s\n"
-        "         FROM bt GROUP BY m, a)",
-        "lv AS (SELECT CAST(sum(CASE WHEN k.king = 0 THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS landau_viol\n"
-        "         FROM sc s2 JOIN (SELECT m, max(s) AS mx FROM"
-        " sc\n"
-        "           GROUP BY m) t ON t.m = s2.m AND"
-        " t.mx = s2.s\n"
-        "         JOIN kg k ON k.m = s2.m AND k.a = s2.a)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT h.nhp, h.n, x.n AS expected_n,\n"
-        "       r.redei_viol, v.hist_viol, k.king_viol,\n"
-        "       w.landau_viol, l.n_docs\n"
-        "FROM hh h JOIN hx x ON x.h = h.nhp\n"
-        "CROSS JOIN rv r CROSS JOIN hv v CROSS JOIN kv k\n"
-        "CROSS JOIN lv w CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q713_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q713_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{hist}", _Q713_HIST))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q713_tournament_redei",
-       "WITH " + _q713_join("documents", "//", " MATERIALIZED"))
-def q713(spark, sf_dir):
-    """Tournament theorems by total exhaustion — all 1024
-    orientations of K5 carry an ODD number of Hamiltonian
-    paths, and every one has a king (Redei 1934 — tournaments
-    always have a Hamiltonian path, and in fact an odd number
-    of them, one of combinatorics' strangest parities; Landau
-    1953 for kings — the dominance-ordering structure of
-    round-robin results).  Every tournament is a 10-bit
-    orientation mask from two corpus dims; the Hamiltonian
-    census joins all 1024 against all 120 vertex orders, each
-    path a four-term CASE-dispatched direction check, giving
-    per-tournament counts in {1, 3, 5, 9, 11, 13, 15} — ODD
-    every single time (redei_viol == 0: existence AND parity
-    in one certificate; no tournament on five vertices has 7
-    Hamiltonian paths, a quirk the pinned census
-    120/120/240/240/120/120/64 exposes — hist_viol == 0, with
-    15 attained exactly by the 64 regular-ish extremes).
-    Kings: the beats relation plus its two-step closure shows
-    every tournament has a vertex reaching all others in at
-    most two steps (king_viol == 0), and Landau's classical
-    argument is verified as data — EVERY maximum-score vertex
-    is a king (landau_viol == 0, the proof's content: a
-    top scorer's non-victims are beaten by its victims).
-    Scale: a 123k-row path join and a closure join; fixed
-    cost, corpus-independent."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q713_documents")
-    parts, fin = _q713_sql("q713_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q713_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{hist}", _Q713_HIST))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("g32", "e5", "hx", "tm", "pm", "hp", "bt",
-                  "kg", "sc"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q713_{nm}",
-                      max_rows=25000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q714: matroid axioms for the graphic matroid of K4 — basis
-# exchange, rank submodularity, augmentation, by exhaustion
-
-
-def _q714_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d8 AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"e6 AS (SELECT DISTINCT CAST(doc_id % 6 AS BIGINT)"
-        f" AS i FROM {tbl})",
-        "mk AS{mat} (SELECT hi.b*8 + lo.b AS m\n"
-        "         FROM d8 hi CROSS JOIN d8 lo)",
-        "y0 AS{mat} (SELECT m, CAST(0 AS BIGINT) AS l0,\n"
-        "           CAST(1 AS BIGINT) AS l1, CAST(2 AS BIGINT)"
-        " AS l2,\n"
-        "           CAST(3 AS BIGINT) AS l3 FROM mk)",
-    ]
-    for k in range(1, 4):
-        parts.append(
-            f"y{k} AS{{mat}} (SELECT m, least(l0, CASE WHEN ((m {d} 1) % 2) = 1 THEN l1 ELSE 9 END, CASE WHEN ((m {d} 2) % 2) = 1 THEN l2 ELSE 9 END, CASE WHEN ((m {d} 4) % 2) = 1 THEN l3 ELSE 9 END) AS l0, least(l1, CASE WHEN ((m {d} 1) % 2) = 1 THEN l0 ELSE 9 END, CASE WHEN ((m {d} 8) % 2) = 1 THEN l2 ELSE 9 END, CASE WHEN ((m {d} 16) % 2) = 1 THEN l3 ELSE 9 END) AS l1, least(l2, CASE WHEN ((m {d} 2) % 2) = 1 THEN l0 ELSE 9 END, CASE WHEN ((m {d} 8) % 2) = 1 THEN l1 ELSE 9 END, CASE WHEN ((m {d} 32) % 2) = 1 THEN l3 ELSE 9 END) AS l2, least(l3, CASE WHEN ((m {d} 4) % 2) = 1 THEN l0 ELSE 9 END, CASE WHEN ((m {d} 16) % 2) = 1 THEN l1 ELSE 9 END, CASE WHEN ((m {d} 32) % 2) = 1 THEN l2 ELSE 9 END) AS l3 FROM y{k - 1})")
-    parts += [
-        # rank = 4 - #components; independence = rank == |E|
-        "rk AS{mat} (SELECT g.m,\n"
-        "           CAST(4 - ((CASE WHEN l0 = 0 THEN 1 ELSE 0 END) + (CASE WHEN l1 = 1 THEN 1 ELSE 0 END) + (CASE WHEN l2 = 2 THEN 1 ELSE 0 END) + (CASE WHEN l3 = 3 THEN 1 ELSE 0 END)) AS BIGINT) AS r,\n"
-        "           CAST(((m {d} 1) % 2) + ((m {d} 2) % 2) + ((m {d} 4) % 2) + ((m {d} 8) % 2) + ((m {d} 16) % 2) + ((m {d} 32) % 2) AS BIGINT) AS pc\n"
-        "         FROM y3 g)",
-        "ind AS{mat} (SELECT m, pc FROM rk WHERE r = pc)",
-        "bs AS{mat} (SELECT m FROM rk WHERE r = 3 AND"
-        " pc = 3)",
-        "nb AS (SELECT CAST(count(*) AS BIGINT) AS n_bases"
-        " FROM bs)",
-        "ni AS (SELECT CAST(count(*) AS BIGINT) AS n_indep"
-        " FROM ind)",
-        # basis exchange: for all B1, B2 and e in B1 \ B2 there
-        # is f in B2 \ B1 with B1 - e + f a basis
-        "exv AS (SELECT CAST(sum(CASE WHEN t.nf < 1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS exchange_viol FROM (\n"
-        "           SELECT b1.m AS m1, b2.m AS m2, e.i AS e,\n"
-        "             sum(CASE WHEN f.i IS NOT NULL THEN 1"
-        " ELSE 0 END)\n"
-        "               AS nf\n"
-        "           FROM bs b1 CROSS JOIN bs b2\n"
-        "           JOIN e6 e ON ((b1.m {d} (CASE e.i WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END)) % 2) = 1 AND ((b2.m {d} (CASE e.i WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END)) % 2) = 0\n"
-        "           LEFT JOIN e6 f ON ((b2.m {d} (CASE f.i WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END)) % 2) = 1 AND ((b1.m {d} (CASE f.i WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END)) % 2)"
-        " = 0\n"
-        "             AND f.i <> e.i\n"
-        "           LEFT JOIN bs b3 ON b3.m = b1.m\n"
-        "             - (CASE e.i WHEN 0 THEN 1 WHEN 1 THEN 2"
-        " WHEN 2\n"
-        "               THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16"
-        " ELSE 32 END)\n"
-        "             + (CASE f.i WHEN 0 THEN 1 WHEN 1 THEN 2"
-        " WHEN 2\n"
-        "               THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16"
-        " ELSE 32 END)\n"
-        "           GROUP BY b1.m, b2.m, e.i\n"
-        "           HAVING sum(CASE WHEN f.i IS NOT NULL AND\n"
-        "             b3.m IS NOT NULL THEN 1 ELSE 0 END) ="
-        " 0) t)",
-        # rank submodularity over all 4096 subset pairs
-        "sbv AS (SELECT CAST(sum(CASE WHEN ra.r + rb.r <\n"
-        "           ru.r + ri.r THEN 1 ELSE 0 END) AS BIGINT)\n"
-        "           AS submod_viol\n"
-        "         FROM mk a CROSS JOIN mk b\n"
-        "         JOIN rk ra ON ra.m = a.m\n"
-        "         JOIN rk rb ON rb.m = b.m\n"
-        "         JOIN rk ru ON ru.m = (1*(((a.m {d} 1) % 2) + ((b.m {d} 1) % 2) - ((a.m {d} 1) % 2)*((b.m {d} 1) % 2)) + 2*(((a.m {d} 2) % 2) + ((b.m {d} 2) % 2) - ((a.m {d} 2) % 2)*((b.m {d} 2) % 2)) + 4*(((a.m {d} 4) % 2) + ((b.m {d} 4) % 2) - ((a.m {d} 4) % 2)*((b.m {d} 4) % 2)) + 8*(((a.m {d} 8) % 2) + ((b.m {d} 8) % 2) - ((a.m {d} 8) % 2)*((b.m {d} 8) % 2)) + 16*(((a.m {d} 16) % 2) + ((b.m {d} 16) % 2) - ((a.m {d} 16) % 2)*((b.m {d} 16) % 2)) + 32*(((a.m {d} 32) % 2) + ((b.m {d} 32) % 2) - ((a.m {d} 32) % 2)*((b.m {d} 32) % 2)))\n"
-        "         JOIN rk ri ON ri.m = (1*(((a.m {d} 1) % 2)*((b.m {d} 1) % 2)) + 2*(((a.m {d} 2) % 2)*((b.m {d} 2) % 2)) + 4*(((a.m {d} 4) % 2)*((b.m {d} 4) % 2)) + 8*(((a.m {d} 8) % 2)*((b.m {d} 8) % 2)) + 16*(((a.m {d} 16) % 2)*((b.m {d} 16) % 2)) + 32*(((a.m {d} 32) % 2)*((b.m {d} 32) % 2))))",
-        # independence augmentation over all independent pairs
-        "agv AS (SELECT CAST(sum(CASE WHEN t.nf < 1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS augment_viol FROM (\n"
-        "           SELECT i1.m AS m1, i2.m AS m2,\n"
-        "             sum(CASE WHEN i3.m IS NOT NULL THEN 1"
-        " ELSE 0 END)\n"
-        "               AS nf\n"
-        "           FROM ind i1 JOIN ind i2 ON i2.pc > i1.pc\n"
-        "           LEFT JOIN e6 f ON ((i2.m {d} (CASE f.i WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END)) % 2) = 1 AND ((i1.m {d} (CASE f.i WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 ELSE 32 END)) % 2)"
-        " = 0\n"
-        "           LEFT JOIN ind i3 ON i3.m = i1.m +\n"
-        "             (CASE f.i WHEN 0 THEN 1 WHEN 1 THEN 2"
-        " WHEN 2\n"
-        "               THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16"
-        " ELSE 32 END)\n"
-        "           GROUP BY i1.m, i2.m) t)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT b.m AS basis_mask, n.n_bases, i.n_indep,\n"
-        "       x.exchange_viol, s.submod_viol,"
-        " a.augment_viol,\n"
-        "       l.n_docs\n"
-        "FROM bs b CROSS JOIN nb n CROSS JOIN ni i\n"
-        "CROSS JOIN exv x CROSS JOIN sbv s CROSS JOIN agv a\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q714_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q714_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q714_matroid_axioms",
-       "WITH " + _q714_join("documents", "//", " MATERIALIZED"))
-def q714(spark, sf_dir):
-    """The graphic matroid of K4 certified axiom by axiom over
-    its whole ground-set lattice (Whitney 1935; matroids are
-    the abstraction that makes EVERY greedy-works argument —
-    Kruskal, Boruvka (q593), spectrum auctions — one theorem,
-    and the axioms are checked here by exhaustion, not
-    assumed).  Rank computes for all 64 edge subsets as
-    4 minus the component count, components by three
-    label-propagation rounds in pure column arithmetic; the 16
-    bases are exactly the spanning trees (n_bases == 16 ==
-    Cayley's 4^2, q644's count met again from a different
-    direction) and 38 subsets are independent (forests).
-    Three axiom certificates, all exhaustive: BASIS EXCHANGE —
-    for every ordered basis pair and every e in B1 \\ B2, some
-    f in B2 \\ B1 has B1 - e + f a basis (exchange_viol == 0,
-    the axiom behind every basis-swap pivot); RANK
-    SUBMODULARITY — r(A) + r(B) >= r(A u B) + r(A n B) over
-    all 4096 subset pairs, with union and intersection masks
-    built by per-bit arithmetic (submod_viol == 0, the
-    diminishing-returns inequality); and AUGMENTATION — every
-    smaller independent set extends by some element of every
-    larger one (augment_viol == 0, the exact reason greedy
-    never strands itself).  Scale: closure columns over a
-    64-row lattice and dim-squared certificate joins; fixed
-    cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q714_documents")
-    parts, fin = _q714_sql("q714_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q714_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d8", "e6", "mk", "rk", "ind", "bs") or \
-                (nm[0] == "y" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q714_{nm}",
-                      max_rows=200)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q715: Oddtown and Eventown — the linear-algebra bounds met
-# by total family exhaustion at n = 4
-
-
-def _q715_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d16 AS (SELECT DISTINCT CAST(doc_id % 16 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"s15 AS (SELECT DISTINCT CAST(doc_id % 15 + 1 AS"
-        f" BIGINT) AS s FROM {tbl})",
-        # odd-size and even-size nonempty subsets of {1..4}
-        "osb AS{mat} (SELECT s, row_number() OVER (ORDER BY s)"
-        " - 1 AS k\n"
-        "         FROM s15 WHERE (((s {d} 1) % 2) + ((s {d} 2) % 2) + ((s {d} 4) % 2) + ((s {d} 8) % 2)) % 2 = 1)",
-        "esb AS{mat} (SELECT s, row_number() OVER (ORDER BY s)"
-        " - 1 AS k\n"
-        "         FROM s15 WHERE (((s {d} 1) % 2) + ((s {d} 2) % 2) + ((s {d} 4) % 2) + ((s {d} 8) % 2)) % 2 = 0)",
-        "fm AS{mat} (SELECT hi.b*16 + lo.b AS f\n"
-        "         FROM d16 hi CROSS JOIN d16 lo)",
-        # oddtown: families of odd sets with even pairwise
-        # intersections — the validity sift
-        "ov AS{mat} (SELECT t.f, t.sz FROM (\n"
-        "           SELECT f.f,\n"
-        "             sum(CASE WHEN (f.f {d} (CASE a.k WHEN 0"
-        " THEN 1\n"
-        "               WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3"
-        " THEN 8\n"
-        "               WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6"
-        " THEN 64\n"
-        "               ELSE 128 END)) % 2 = 1 AND a.s = b.s"
-        " THEN 1\n"
-        "               ELSE 0 END) AS sz,\n"
-        "             sum(CASE WHEN a.s < b.s AND\n"
-        "               (f.f {d} (CASE a.k WHEN 0 THEN 1 WHEN"
-        " 1 THEN 2\n"
-        "                 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4"
-        " THEN 16\n"
-        "                 WHEN 5 THEN 32 WHEN 6 THEN 64 ELSE"
-        " 128 END))\n"
-        "                 % 2 = 1 AND\n"
-        "               (f.f {d} (CASE b.k WHEN 0 THEN 1 WHEN"
-        " 1 THEN 2\n"
-        "                 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4"
-        " THEN 16\n"
-        "                 WHEN 5 THEN 32 WHEN 6 THEN 64 ELSE"
-        " 128 END))\n"
-        "                 % 2 = 1 AND\n"
-        "               ((((a.s {d} 1) % 2)*((b.s {d} 1) % 2) + ((a.s {d} 2) % 2)*((b.s {d} 2) % 2) + ((a.s {d} 4) % 2)*((b.s {d} 4) % 2) + ((a.s {d} 8) % 2)*((b.s {d} 8) % 2)) % 2) = 1 THEN 1 ELSE 0 END) AS"
-        " bad\n"
-        "           FROM fm f CROSS JOIN osb a CROSS JOIN osb"
-        " b\n"
-        "           WHERE f.f < 256\n"
-        "           GROUP BY f.f) t WHERE t.bad = 0)",
-        "om AS (SELECT CAST(max(sz) AS BIGINT) AS mx,\n"
-        "           CAST(sum(CASE WHEN sz = (SELECT max(sz)"
-        " FROM ov)\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS nmx"
-        " FROM ov)",
-        # eventown (nonempty members)
-        "ev AS{mat} (SELECT t.f, t.sz FROM (\n"
-        "           SELECT f.f,\n"
-        "             sum(CASE WHEN (f.f {d} (CASE a.k WHEN 0"
-        " THEN 1\n"
-        "               WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3"
-        " THEN 8\n"
-        "               WHEN 4 THEN 16 WHEN 5 THEN 32 ELSE 64"
-        " END))\n"
-        "               % 2 = 1 AND a.s = b.s THEN 1 ELSE 0"
-        " END) AS sz,\n"
-        "             sum(CASE WHEN a.s < b.s AND\n"
-        "               (f.f {d} (CASE a.k WHEN 0 THEN 1 WHEN"
-        " 1 THEN 2\n"
-        "                 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4"
-        " THEN 16\n"
-        "                 WHEN 5 THEN 32 ELSE 64 END)) % 2 ="
-        " 1 AND\n"
-        "               (f.f {d} (CASE b.k WHEN 0 THEN 1 WHEN"
-        " 1 THEN 2\n"
-        "                 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4"
-        " THEN 16\n"
-        "                 WHEN 5 THEN 32 ELSE 64 END)) % 2 ="
-        " 1 AND\n"
-        "               ((((a.s {d} 1) % 2)*((b.s {d} 1) % 2) + ((a.s {d} 2) % 2)*((b.s {d} 2) % 2) + ((a.s {d} 4) % 2)*((b.s {d} 4) % 2) + ((a.s {d} 8) % 2)*((b.s {d} 8) % 2)) % 2) = 1 THEN 1 ELSE 0 END) AS"
-        " bad\n"
-        "           FROM fm f CROSS JOIN esb a CROSS JOIN esb"
-        " b\n"
-        "           WHERE f.f < 128\n"
-        "           GROUP BY f.f) t WHERE t.bad = 0)",
-        "em AS (SELECT CAST(max(sz) AS BIGINT) AS mx,\n"
-        "           CAST(sum(CASE WHEN sz = (SELECT max(sz)"
-        " FROM ev)\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS nmx"
-        " FROM ev)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.town, t.max_clubs, t.n_max_families,\n"
-        "       l.n_docs\n"
-        "FROM (SELECT CAST(0 AS BIGINT) AS town, o.mx AS"
-        " max_clubs,\n"
-        "         o.nmx AS n_max_families FROM om o\n"
-        "       UNION ALL SELECT 1, e.mx, e.nmx FROM em e) t\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q715_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q715_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q715_oddtown_eventown",
-       "WITH " + _q715_join("documents", "//", " MATERIALIZED"))
-def q715(spark, sf_dir):
-    """Oddtown and Eventown — the linear-algebra method's
-    poster theorems, with their bounds found by total family
-    exhaustion at n = 4 (Berlekamp 1969, the Eventown contrast
-    via Frankl; 'clubs with odd sizes and even pairwise
-    intersections number at most n' is THE example where a
-    dimension argument beats counting, and here the bound is
-    observed as the exact maximum over every possible family).
-    The 8 odd-size and 7 even-size nonempty subsets of a
-    4-element ground set index family bitmasks; all 256
-    oddtown candidates and 128 eventown candidates are sifted
-    by the pairwise-intersection-parity condition (intersection
-    popcounts by per-bit products).  Oddtown: the maximum
-    valid family has EXACTLY 4 = n clubs — the GF(2) linear
-    independence bound attained — and exactly 2 maximum
-    families exist (the four singletons, and the four
-    3-element sets: the two natural 'towns', found not
-    guessed).  Eventown (nonempty clubs): the maximum is 3 =
-    2^(n/2) - 1, attained by exactly 3 families — pair-partition
-    closures minus the empty club — showing the startling
-    asymmetry: eventowns can be EXPONENTIALLY large in n while
-    oddtowns stay linear, visible already at n = 4.  Scale:
-    two family sifts of a few thousand grouped rows; fixed
-    cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q715_documents")
-    parts, fin = _q715_sql("q715_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q715_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d16", "s15", "osb", "esb", "fm", "ov",
-                  "ev"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q715_{nm}",
-                      max_rows=300)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q716: Cauchy–Davenport + Vosper — sumset lower bounds in Z_7
-# by total exhaustion, with the equality cases characterized
-
-
-def _q716_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d128 AS (SELECT DISTINCT CAST(doc_id % 128 AS"
-        f" BIGINT) AS b FROM {tbl})",
-        f"dd AS (SELECT DISTINCT CAST(doc_id % 6 + 1 AS"
-        f" BIGINT) AS d2 FROM {tbl})",
-        f"a7 AS (SELECT DISTINCT CAST(doc_id % 7 AS BIGINT)"
-        f" AS a0 FROM {tbl})",
-        "pr AS{mat} (SELECT x.b AS am, y.b AS bm\n"
-        "         FROM d128 x JOIN d128 y ON x.b >= 1 AND"
-        " y.b >= 1)",
-        # one projection: |A|, |B|, |A+B| per pair
-        "sz AS{mat} (SELECT g.am, g.bm,\n"
-        "           CAST(((g.am {d} 1) % 2) + ((g.am {d} 2) % 2) + ((g.am {d} 4) % 2) + ((g.am {d} 8) % 2) + ((g.am {d} 16) % 2) + ((g.am {d} 32) % 2) + ((g.am {d} 64) % 2) AS BIGINT) AS ka,\n"
-        "           CAST(((g.bm {d} 1) % 2) + ((g.bm {d} 2) % 2) + ((g.bm {d} 4) % 2) + ((g.bm {d} 8) % 2) + ((g.bm {d} 16) % 2) + ((g.bm {d} 32) % 2) + ((g.bm {d} 64) % 2) AS BIGINT) AS kb,\n"
-        "           CAST((CASE WHEN ((g.am {d} 1) % 2)*((g.bm {d} 1) % 2) + ((g.am {d} 2) % 2)*((g.bm {d} 64) % 2) + ((g.am {d} 4) % 2)*((g.bm {d} 32) % 2) + ((g.am {d} 8) % 2)*((g.bm {d} 16) % 2) + ((g.am {d} 16) % 2)*((g.bm {d} 8) % 2) + ((g.am {d} 32) % 2)*((g.bm {d} 4) % 2) + ((g.am {d} 64) % 2)*((g.bm {d} 2) % 2) >= 1 THEN 1 ELSE 0 END) + (CASE WHEN ((g.am {d} 1) % 2)*((g.bm {d} 2) % 2) + ((g.am {d} 2) % 2)*((g.bm {d} 1) % 2) + ((g.am {d} 4) % 2)*((g.bm {d} 64) % 2) + ((g.am {d} 8) % 2)*((g.bm {d} 32) % 2) + ((g.am {d} 16) % 2)*((g.bm {d} 16) % 2) + ((g.am {d} 32) % 2)*((g.bm {d} 8) % 2) + ((g.am {d} 64) % 2)*((g.bm {d} 4) % 2) >= 1 THEN 1 ELSE 0 END) + (CASE WHEN ((g.am {d} 1) % 2)*((g.bm {d} 4) % 2) + ((g.am {d} 2) % 2)*((g.bm {d} 2) % 2) + ((g.am {d} 4) % 2)*((g.bm {d} 1) % 2) + ((g.am {d} 8) % 2)*((g.bm {d} 64) % 2) + ((g.am {d} 16) % 2)*((g.bm {d} 32) % 2) + ((g.am {d} 32) % 2)*((g.bm {d} 16) % 2) + ((g.am {d} 64) % 2)*((g.bm {d} 8) % 2) >= 1 THEN 1 ELSE 0 END) + (CASE WHEN ((g.am {d} 1) % 2)*((g.bm {d} 8) % 2) + ((g.am {d} 2) % 2)*((g.bm {d} 4) % 2) + ((g.am {d} 4) % 2)*((g.bm {d} 2) % 2) + ((g.am {d} 8) % 2)*((g.bm {d} 1) % 2) + ((g.am {d} 16) % 2)*((g.bm {d} 64) % 2) + ((g.am {d} 32) % 2)*((g.bm {d} 32) % 2) + ((g.am {d} 64) % 2)*((g.bm {d} 16) % 2) >= 1 THEN 1 ELSE 0 END) + (CASE WHEN ((g.am {d} 1) % 2)*((g.bm {d} 16) % 2) + ((g.am {d} 2) % 2)*((g.bm {d} 8) % 2) + ((g.am {d} 4) % 2)*((g.bm {d} 4) % 2) + ((g.am {d} 8) % 2)*((g.bm {d} 2) % 2) + ((g.am {d} 16) % 2)*((g.bm {d} 1) % 2) + ((g.am {d} 32) % 2)*((g.bm {d} 64) % 2) + ((g.am {d} 64) % 2)*((g.bm {d} 32) % 2) >= 1 THEN 1 ELSE 0 END) + (CASE WHEN ((g.am {d} 1) % 2)*((g.bm {d} 32) % 2) + ((g.am {d} 2) % 2)*((g.bm {d} 16) % 2) + ((g.am {d} 4) % 2)*((g.bm {d} 8) % 2) + ((g.am {d} 8) % 2)*((g.bm {d} 4) % 2) + ((g.am {d} 16) % 2)*((g.bm {d} 2) % 2) + ((g.am {d} 32) % 2)*((g.bm {d} 1) % 2) + ((g.am {d} 64) % 2)*((g.bm {d} 64) % 2) >= 1 THEN 1 ELSE 0 END) + (CASE WHEN ((g.am {d} 1) % 2)*((g.bm {d} 64) % 2) + ((g.am {d} 2) % 2)*((g.bm {d} 32) % 2) + ((g.am {d} 4) % 2)*((g.bm {d} 16) % 2) + ((g.am {d} 8) % 2)*((g.bm {d} 8) % 2) + ((g.am {d} 16) % 2)*((g.bm {d} 4) % 2) + ((g.am {d} 32) % 2)*((g.bm {d} 2) % 2) + ((g.am {d} 64) % 2)*((g.bm {d} 1) % 2) >= 1 THEN 1 ELSE 0 END) AS BIGINT) AS ks\n"
-        "         FROM pr g)",
-        "cv AS (SELECT CAST(sum(CASE WHEN ks < CASE WHEN"
-        " ka + kb - 1\n"
-        "           < 7 THEN ka + kb - 1 ELSE 7 END THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS cd_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_pairs"
-        " FROM sz)",
-        # the critical pairs: equality, small sumset, |A|,|B|>=2
-        "cr AS{mat} (SELECT am, bm, ka, kb FROM sz\n"
-        "         WHERE ks = ka + kb - 1 AND ks <= 5 AND\n"
-        "           ka >= 2 AND kb >= 2)",
-        # AP masks: for each (start, difference, length), the
-        # bitmask of the arithmetic progression in Z_7
-        "apm AS{mat} (SELECT v.a0, v.d2 AS d, t.k,\n"
-        "           CAST(CASE t.k WHEN 2 THEN ((CASE (v.a0 + 0*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 1*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END)) WHEN 3 THEN ((CASE (v.a0 + 0*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 1*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 2*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END)) WHEN 4 THEN ((CASE (v.a0 + 0*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 1*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 2*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 3*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END)) WHEN 5 THEN ((CASE (v.a0 + 0*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 1*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 2*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 3*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 4*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END)) WHEN 6 THEN ((CASE (v.a0 + 0*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 1*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 2*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 3*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 4*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END) + (CASE (v.a0 + 5*v.d2) % 7 WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 END)) END AS BIGINT) AS mk\n"
-        "         FROM (SELECT a0.a0, dd.d2 FROM a7 a0 CROSS"
-        " JOIN dd) v\n"
-        "         CROSS JOIN (SELECT DISTINCT CAST(doc_id % 5"
-        " + 2\n"
-        "           AS BIGINT) AS k FROM q716_documents_src)"
-        " t)",
-        # Vosper: every critical pair is (AP, AP) with a COMMON
-        # difference
-        "vv AS (SELECT CAST(sum(CASE WHEN t.okd < 1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS vosper_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_critical"
-        " FROM (\n"
-        "           SELECT c.am, c.bm,\n"
-        "             sum(CASE WHEN pa.mk IS NOT NULL AND\n"
-        "               pb.mk IS NOT NULL THEN 1 ELSE 0 END)"
-        " AS okd\n"
-        "           FROM cr c CROSS JOIN dd\n"
-        "           LEFT JOIN (SELECT DISTINCT d, k, mk FROM"
-        " apm) pa\n"
-        "             ON pa.d = dd.d2 AND pa.k = c.ka AND\n"
-        "               pa.mk = c.am\n"
-        "           LEFT JOIN (SELECT DISTINCT d, k, mk FROM"
-        " apm) pb\n"
-        "             ON pb.d = dd.d2 AND pb.k = c.kb AND\n"
-        "               pb.mk = c.bm\n"
-        "           GROUP BY c.am, c.bm) t)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.ka, t.kb, t.n, t.ncrit,\n"
-        "       c.cd_viol, c.n_pairs, v.vosper_viol,\n"
-        "       v.n_critical, l.n_docs\n"
-        "FROM (SELECT s.ka, s.kb, CAST(count(*) AS BIGINT) AS"
-        " n,\n"
-        "         CAST(sum(CASE WHEN r.am IS NOT NULL THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS ncrit\n"
-        "       FROM sz s LEFT JOIN cr r ON r.am = s.am AND\n"
-        "         r.bm = s.bm GROUP BY s.ka, s.kb) t\n"
-        "CROSS JOIN cv c CROSS JOIN vv v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q716_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q716_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("q716_documents_src", tbl))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q716_cauchy_davenport",
-       "WITH " + _q716_join("documents", "//", " MATERIALIZED"))
-def q716(spark, sf_dir):
-    """Cauchy–Davenport and Vosper's inverse theorem in Z_7 by
-    total exhaustion — every one of the 16129 nonempty subset
-    pairs, with the equality cases CHARACTERIZED, not merely
-    counted (Cauchy 1813, Davenport 1935; |A+B| >= min(p,
-    |A|+|B|-1) is the opening theorem of additive
-    combinatorics, and Vosper 1956 is its inverse: equality in
-    the nondegenerate range forces arithmetic progressions
-    with a common difference).  Both subsets range over all
-    127 nonempty masks; one projection computes |A|, |B|, and
-    |A+B| (each residue hit iff some a in A has c - a in B —
-    49 bit products).  The lower bound holds with ZERO
-    violations across the whole universe (cd_viol == 0).  The
-    882 critical pairs (equality, |A+B| <= p - 2, both sides
-    >= 2) then face Vosper's test: an AP-mask dim enumerates
-    every arithmetic progression of every length, start, and
-    difference in Z_7, and EVERY critical pair is an (AP, AP)
-    pair sharing a difference (vosper_viol == 0) — the inverse
-    theorem's structure conclusion verified case by case,
-    with the (ka, kb) census emitted.  Scale: one 16k-row
-    projection plus dim joins; the AP dim has 210 rows."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q716_documents")
-    parts, fin = _q716_sql("q716_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q716_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("q716_documents_src", "q716_documents"))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d128", "dd", "a7", "pr", "sz", "cr",
-                  "apm"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q716_{nm}",
-                      max_rows=20000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q717: Erdos–Ginzburg–Ziv at n = 4 — every 7-element multiset
-# has a zero-sum 4-subset, and 2n-2 is genuinely not enough
-
-
-def _q717_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d8 AS (SELECT DISTINCT CAST(doc_id % 8 AS BIGINT)"
-        f" AS c FROM {tbl})",
-        f"d5 AS (SELECT DISTINCT CAST(doc_id % 5 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        # all 120 multisets of size 7 over Z_4, as count vectors
-        "ms AS{mat} (SELECT a.c AS c0, b.c AS c1, c.c AS c2,\n"
-        "           7 - a.c - b.c - c.c AS c3\n"
-        "         FROM d8 a CROSS JOIN d8 b CROSS JOIN d8 c\n"
-        "         WHERE 7 - a.c - b.c - c.c >= 0)",
-        # all zero-sum 4-picks over Z_4, as count vectors
-        "zp AS{mat} (SELECT x.a AS a0, y.a AS a1, z.a AS a2,\n"
-        "           4 - x.a - y.a - z.a AS a3\n"
-        "         FROM d5 x CROSS JOIN d5 y CROSS JOIN d5 z\n"
-        "         WHERE 4 - x.a - y.a - z.a >= 0\n"
-        "           AND (y.a + 2*z.a + 3*(4 - x.a - y.a -"
-        " z.a)) % 4\n"
-        "             = 0)",
-        # EGZ: every multiset admits at least one fitting pick
-        "eg AS{mat} (SELECT m.c0, m.c1, m.c2, m.c3,\n"
-        "           CAST(sum(CASE WHEN p.a0 <= m.c0 AND\n"
-        "             p.a1 <= m.c1 AND p.a2 <= m.c2 AND\n"
-        "             p.a3 <= m.c3 THEN 1 ELSE 0 END) AS"
-        " BIGINT) AS nz\n"
-        "         FROM ms m CROSS JOIN zp p\n"
-        "         GROUP BY m.c0, m.c1, m.c2, m.c3)",
-        "ev AS (SELECT CAST(sum(CASE WHEN nz < 1 THEN 1 ELSE 0"
-        " END)\n"
-        "           AS BIGINT) AS egz_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_multisets,\n"
-        "           CAST(min(nz) AS BIGINT) AS min_picks"
-        " FROM eg)",
-        # tightness: the size-6 witness 0,0,0,1,1,1 has NO
-        # zero-sum 4-subset
-        "wt AS (SELECT CAST(sum(CASE WHEN p.a0 <= 3 AND\n"
-        "           p.a1 <= 3 AND p.a2 <= 0 AND p.a3 <= 0"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS witness_picks\n"
-        "         FROM zp p)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT g.c0, g.c1, g.c2, g.c3, g.nz AS"
-        " n_zero_picks,\n"
-        "       v.egz_viol, v.n_multisets, v.min_picks,\n"
-        "       w.witness_picks, l.n_docs\n"
-        "FROM eg g CROSS JOIN ev v CROSS JOIN wt w\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q717_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q717_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q717_erdos_ginzburg_ziv",
-       "WITH " + _q717_join("documents", "//", " MATERIALIZED"))
-def q717(spark, sf_dir):
-    """The Erdos–Ginzburg–Ziv theorem at n = 4 by total
-    exhaustion — every multiset of 2n - 1 = 7 residues mod 4
-    contains n = 4 elements summing to zero, and 2n - 2 is
-    genuinely not enough (Erdos, Ginzburg & Ziv 1961; the
-    founding result of zero-sum combinatorics, EGZ is the
-    pigeonhole that always finds a balanced committee).  All
-    120 size-7 multisets over Z_4 materialize as count
-    vectors (c0..c3 summing to 7); all zero-sum 4-picks
-    materialize likewise (count vectors summing to 4 with
-    weighted sum divisible by 4); and the theorem is one
-    containment join — EVERY multiset dominates at least one
-    zero-sum pick (egz_viol == 0 over all 120, with min_picks
-    >= 1 emitted: the scarcest multisets still admit one).
-    Tightness is a counter-witness, checked not asserted: the
-    size-6 multiset {0,0,0,1,1,1} dominates NO zero-sum pick
-    (witness_picks == 0) — any four of its elements hold one,
-    two, or three ones, never a multiple of four — so the
-    2n - 1 in the theorem cannot be lowered.  The emitted
-    per-multiset pick counts show the extremal structure: the
-    constant multisets are richest, the near-witness ones
-    poorest.  Scale: a 120 x |picks| containment join over
-    dims; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q717_documents")
-    parts, fin = _q717_sql("q717_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q717_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d8", "d5", "ms", "zp", "eg"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q717_{nm}",
-                      max_rows=300)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q718: Sylvester–Gallai + De Bruijn–Erdos — ordinary lines and
-# the line-count bound, exact incidence arithmetic
-
-
-def _q718_lines(src: str, nm: str) -> list:
-    """Shared line-construction chain over a point view."""
-    return [
-        f"{nm}pp AS{{mat}} (SELECT a.i AS i1, b.i AS i2,\n"
-        f"           b.y - a.y AS la, a.x - b.x AS lb,\n"
-        f"           -((b.y - a.y)*a.x + (a.x - b.x)*a.y) AS"
-        f" lc\n"
-        f"         FROM {src} a JOIN {src} b ON b.i > a.i\n"
-        f"         WHERE a.x <> b.x OR a.y <> b.y)",
-        # normalize: divide by the gcd (exhaustive divisor max),
-        # then canonical sign
-        f"{nm}pg AS{{mat}} (SELECT p.i1, p.i2, p.la, p.lb,"
-        f" p.lc,\n"
-        f"           max(g.g) AS g FROM {nm}pp p\n"
-        f"         JOIN gset g ON abs(p.la) % g.g = 0 AND\n"
-        f"           abs(p.lb) % g.g = 0 AND abs(p.lc) % g.g ="
-        f" 0\n"
-        f"         GROUP BY p.i1, p.i2, p.la, p.lb, p.lc)",
-        f"{nm}ln AS{{mat}} (SELECT DISTINCT\n"
-        f"           CASE WHEN la {{d}} g < 0 OR (la = 0 AND"
-        f" lb {{d}} g < 0)\n"
-        f"             THEN -(la {{d}} g) ELSE la {{d}} g END"
-        f" AS a,\n"
-        f"           CASE WHEN la {{d}} g < 0 OR (la = 0 AND"
-        f" lb {{d}} g < 0)\n"
-        f"             THEN -(lb {{d}} g) ELSE lb {{d}} g END"
-        f" AS b,\n"
-        f"           CASE WHEN la {{d}} g < 0 OR (la = 0 AND"
-        f" lb {{d}} g < 0)\n"
-        f"             THEN -(lc {{d}} g) ELSE lc {{d}} g END"
-        f" AS c\n"
-        f"         FROM {nm}pg)",
-        f"{nm}ic AS{{mat}} (SELECT l.a, l.b, l.c,\n"
-        f"           CAST(count(*) AS BIGINT) AS inc\n"
-        f"         FROM {nm}ln l JOIN {src} p ON\n"
-        f"           l.a*p.x + l.b*p.y + l.c = 0\n"
-        f"         GROUP BY l.a, l.b, l.c)",
-    ]
-
-
-def _q718_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"gset AS (SELECT DISTINCT CAST(doc_id % 18 + 1 AS"
-        f" BIGINT) AS g FROM {tbl})",
-        # corpus points, deduplicated by coordinates
-        f"p0 AS (SELECT doc_id % 10 AS i0,\n"
-        f"           CAST(sum(n_chars) % 19 - 9 AS BIGINT) AS"
-        f" x,\n"
-        f"           CAST(sum(n_chars * (doc_id % 3 + 5)) % 19"
-        f" - 9\n"
-        f"             AS BIGINT) AS y\n"
-        f"         FROM {tbl} GROUP BY doc_id % 10)",
-        "pt AS{mat} (SELECT min(i0) AS i, x, y FROM p0\n"
-        "         GROUP BY x, y)",
-        "npt AS (SELECT CAST(i AS BIGINT) AS i, CAST(x AS"
-        " BIGINT) AS x,\n"
-        "           CAST(y AS BIGINT) AS y FROM (VALUES\n"
-        "           (0, 0, 0), (1, 1, 0), (2, 2, 0), (3, 3,"
-        " 0),\n"
-        "           (4, 4, 0), (5, 0, 3)) t(i, x, y))",
-    ]
-    parts += _q718_lines("pt", "c")
-    parts += _q718_lines("npt", "n")
-    parts += [
-        "cv AS (SELECT\n"
-        "           CAST(count(*) AS BIGINT) AS n_lines,\n"
-        "           CAST(sum(CASE WHEN inc = 2 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS n_ordinary,\n"
-        "           CAST(max(inc) AS BIGINT) AS max_inc\n"
-        "         FROM cic)",
-        "cp AS (SELECT CAST(count(*) AS BIGINT) AS n_pts"
-        " FROM pt)",
-        "sg AS (SELECT CAST(\n"
-        "           CASE WHEN v.max_inc < p.n_pts AND\n"
-        "             v.n_ordinary < 1 THEN 1 ELSE 0 END AS"
-        " BIGINT)\n"
-        "             AS sylvester_viol,\n"
-        "           CAST(CASE WHEN v.max_inc < p.n_pts AND\n"
-        "             v.n_lines < p.n_pts THEN 1 ELSE 0 END AS"
-        " BIGINT)\n"
-        "             AS dbe_viol\n"
-        "         FROM cv v CROSS JOIN cp p)",
-        # the near-pencil: De Bruijn–Erdos EQUALITY case
-        "nv AS (SELECT\n"
-        "           CAST(count(*) AS BIGINT) AS np_lines,\n"
-        "           CAST(sum(CASE WHEN inc = 2 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS np_ordinary\n"
-        "         FROM nic)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT i.a, i.b, i.c, i.inc,\n"
-        "       v.n_lines, v.n_ordinary, v.max_inc, p.n_pts,\n"
-        "       s.sylvester_viol, s.dbe_viol, n.np_lines,\n"
-        "       n.np_ordinary, l.n_docs\n"
-        "FROM cic i CROSS JOIN cv v CROSS JOIN cp p\n"
-        "CROSS JOIN sg s CROSS JOIN nv n CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q718_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q718_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q718_sylvester_gallai",
-       "WITH " + _q718_join("documents", "//", " MATERIALIZED"))
-def q718(spark, sf_dir):
-    """Sylvester–Gallai and De Bruijn–Erdos on corpus point
-    sets — ordinary lines exist and n points determine at
-    least n lines, with the equality case planted (Sylvester
-    1893 asked, Gallai 1944 answered: a finite non-collinear
-    point set always has a line through EXACTLY two points;
-    De Bruijn–Erdos 1948: it determines at least n distinct
-    lines, with equality only for near-pencils).  The corpus
-    points (residue-sum coordinates, deduplicated) generate
-    all pair lines as integer triples (a, b, c), NORMALIZED
-    exactly — divided by their gcd found by exhaustive divisor
-    sweep, sign-canonicalized — so distinct-line counting is
-    exact integer grouping, no floats, no epsilon.  Incidence
-    counts per line then certify both theorems on this
-    instance: when the points are not all collinear, at least
-    one ordinary line exists (sylvester_viol == 0; this corpus
-    instance has MANY, n_ordinary emitted) and the number of
-    distinct lines is at least n_pts (dbe_viol == 0, with the
-    actual count far above the bound).  The planted
-    near-pencil — five collinear points plus one — exercises
-    the De Bruijn–Erdos EQUALITY case: exactly 6 = n lines
-    (np_lines == 6) of which 5 are ordinary, the unique tight
-    configuration type, constructed and measured.  Scale:
-    pair joins over a 10-point dim with an 18-value divisor
-    sweep; all exact."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q718_documents")
-    parts, fin = _q718_sql("q718_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q718_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("gset", "p0", "pt", "npt", "cpp", "cpg",
-                  "cln", "cic", "npp", "npg", "nln", "nic"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q718_{nm}",
-                      max_rows=200)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q719: Monge matrices + the northwest-corner rule — greedy
-# optimality by total plan exhaustion, and its converse witness
-
-
-_Q719_C2 = ("(0, 0, 1), (0, 1, 4), (0, 2, 4), (1, 0, 1),"
-            " (1, 1, 2), (1, 2, 4), (2, 0, 3), (2, 1, 5),"
-            " (2, 2, 4)")
-
-
-def _q719_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"x13 AS (SELECT DISTINCT CAST(doc_id % 13 AS BIGINT)"
-        f" AS v FROM {tbl})",
-        f"i3 AS (SELECT DISTINCT CAST(doc_id % 3 AS BIGINT)"
-        f" AS i FROM {tbl})",
-        "c2t AS (SELECT CAST(i AS BIGINT) AS i, CAST(j AS"
-        " BIGINT) AS j,\n"
-        "           CAST(c AS BIGINT) AS c FROM (VALUES {c2})"
-        " t(i, j, c))",
-        # corpus-varying supplies and demands, totals fixed 12
-        f"sd AS (SELECT s1, CAST(4 AS BIGINT) AS s2,\n"
-        f"           8 - s1 AS s3, d1, CAST(3 AS BIGINT) AS"
-        f" d2,\n"
-        f"           9 - d1 AS d3 FROM (\n"
-        f"           SELECT CAST(sum(n_chars) % 3 + 3 AS"
-        f" BIGINT) AS s1,\n"
-        f"             CAST(sum(n_chars * 7) % 3 + 4 AS"
-        f" BIGINT) AS d1\n"
-        f"           FROM {tbl}) t)",
-        # Monge cost c(i,j) = (i-j)^2 + i + j, certified Monge
-        "cm AS (SELECT x.i, y.i AS j,\n"
-        "           CAST((x.i - y.i)*(x.i - y.i) + x.i + y.i"
-        " AS BIGINT)\n"
-        "             AS c\n"
-        "         FROM i3 x CROSS JOIN i3 y)",
-        "mgv AS (SELECT CAST(sum(CASE WHEN a.c + d2.c >"
-        " b.c + c.c\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " monge_viol\n"
-        "         FROM cm a JOIN cm b ON b.i = a.i AND"
-        " b.j = a.j + 1\n"
-        "         JOIN cm c ON c.i = a.i + 1 AND c.j = a.j\n"
-        "         JOIN cm d2 ON d2.i = a.i + 1 AND"
-        " d2.j = a.j + 1)",
-        # the northwest-corner plan in closed form:
-        # x_ij = max(0, min(S_i, D_j) - max(S_{i-1}, D_{j-1}))
-        "nw AS{mat} (SELECT x.i, y.i AS j,\n"
-        "           greatest(CAST(0 AS BIGINT),\n"
-        "             least(CASE x.i WHEN 0 THEN w.s1 WHEN 1"
-        " THEN\n"
-        "               w.s1 + w.s2 ELSE 12 END,\n"
-        "               CASE y.i WHEN 0 THEN w.d1 WHEN 1 THEN\n"
-        "               w.d1 + w.d2 ELSE 12 END)\n"
-        "             - greatest(CASE x.i WHEN 0 THEN 0 WHEN 1"
-        " THEN\n"
-        "               w.s1 ELSE w.s1 + w.s2 END,\n"
-        "               CASE y.i WHEN 0 THEN 0 WHEN 1 THEN"
-        " w.d1\n"
-        "               ELSE w.d1 + w.d2 END)) AS x\n"
-        "         FROM i3 x CROSS JOIN i3 y CROSS JOIN sd w)",
-        # feasibility of the closed-form plan
-        "fs AS (SELECT CAST(\n"
-        "           (SELECT sum(CASE WHEN t.rs <> CASE t.i"
-        " WHEN 0\n"
-        "             THEN w.s1 WHEN 1 THEN w.s2 ELSE w.s3"
-        " END\n"
-        "             THEN 1 ELSE 0 END) FROM (SELECT i,"
-        " sum(x) AS rs\n"
-        "             FROM nw GROUP BY i) t CROSS JOIN sd w)\n"
-        "           + (SELECT sum(CASE WHEN t.cs <> CASE t.j"
-        " WHEN 0\n"
-        "             THEN w.d1 WHEN 1 THEN w.d2 ELSE w.d3"
-        " END\n"
-        "             THEN 1 ELSE 0 END) FROM (SELECT j,"
-        " sum(x) AS cs\n"
-        "             FROM nw GROUP BY j) t CROSS JOIN sd w)\n"
-        "           AS BIGINT) AS feas_viol)",
-        # exhaustive plan enumeration (free vars x11 x12 x21 x22)
-        "pl AS{mat} (SELECT a.v AS x11, b.v AS x12, c.v AS"
-        " x21,\n"
-        "           e.v AS x22,\n"
-        "           w.s1 - a.v - b.v AS x13,\n"
-        "           w.s2 - c.v - e.v AS x23,\n"
-        "           w.d1 - a.v - c.v AS x31,\n"
-        "           w.d2 - b.v - e.v AS x32,\n"
-        "           w.s3 - (w.d1 - a.v - c.v) - (w.d2 - b.v -"
-        " e.v)\n"
-        "             AS x33\n"
-        "         FROM x13 a CROSS JOIN x13 b CROSS JOIN x13"
-        " c\n"
-        "         CROSS JOIN x13 e CROSS JOIN sd w\n"
-        "         WHERE w.s1 - a.v - b.v >= 0 AND\n"
-        "           w.s2 - c.v - e.v >= 0 AND\n"
-        "           w.d1 - a.v - c.v >= 0 AND\n"
-        "           w.d2 - b.v - e.v >= 0 AND\n"
-        "           w.s3 - (w.d1 - a.v - c.v) - (w.d2 - b.v -"
-        " e.v)\n"
-        "             >= 0)",
-        "op AS (SELECT\n"
-        "           CAST(min(" + " + ".join(
-            f"p.x{i}{j}*(({i - 1} - {j - 1})*({i - 1} -"
-            f" {j - 1}) + {i - 1} + {j - 1})"
-            for i in range(1, 4) for j in range(1, 4))
-        + ") AS BIGINT) AS best,\n"
-        "           CAST(count(*) AS BIGINT) AS n_plans\n"
-        "         FROM pl p)",
-        "nc AS (SELECT CAST(sum(n.x * c.c) AS BIGINT) AS"
-        " nwcost\n"
-        "         FROM nw n JOIN cm c ON c.i = n.i AND"
-        " c.j = n.j)",
-        "hv AS (SELECT CAST(CASE WHEN n.nwcost <> o.best"
-        " THEN 1\n"
-        "           ELSE 0 END AS BIGINT) AS hoffman_viol\n"
-        "         FROM nc n CROSS JOIN op o)",
-        # the converse witness: anti-Monge cost where NW pays
-        # strictly more than optimal (fixed s,d = 3,4,5/5,3,4)
-        "w2 AS (SELECT\n"
-        "           CAST(sum(CASE WHEN a.c + d2.c > b.c + c.c\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " anti_corners\n"
-        "         FROM c2t a JOIN c2t b ON b.i = a.i AND\n"
-        "           b.j = a.j + 1\n"
-        "         JOIN c2t c ON c.i = a.i + 1 AND c.j = a.j\n"
-        "         JOIN c2t d2 ON d2.i = a.i + 1 AND\n"
-        "           d2.j = a.j + 1)",
-        "b2 AS (SELECT CAST(min(" + " + ".join(
-            f"p.x{i}{j}*c{i}{j}.c"
-            for i in range(1, 4) for j in range(1, 4))
-        + ") AS BIGINT) AS best2 FROM (\n"
-        "           SELECT a.v AS x11, b.v AS x12, c.v AS"
-        " x21,\n"
-        "             e.v AS x22, 3 - a.v - b.v AS x13,\n"
-        "             4 - c.v - e.v AS x23, 5 - a.v - c.v AS"
-        " x31,\n"
-        "             3 - b.v - e.v AS x32,\n"
-        "             5 - (5 - a.v - c.v) - (3 - b.v - e.v)"
-        " AS x33\n"
-        "           FROM x13 a CROSS JOIN x13 b CROSS JOIN"
-        " x13 c\n"
-        "           CROSS JOIN x13 e\n"
-        "           WHERE 3 - a.v - b.v >= 0 AND 4 - c.v -"
-        " e.v >= 0\n"
-        "             AND 5 - a.v - c.v >= 0 AND 3 - b.v -"
-        " e.v >= 0\n"
-        "             AND 5 - (5 - a.v - c.v) - (3 - b.v -"
-        " e.v) >= 0) p\n"
-        + "".join(
-            f"         JOIN c2t c{i}{j} ON c{i}{j}.i = {i - 1}"
-            f" AND c{i}{j}.j = {j - 1}\n"
-            for i in range(1, 4) for j in range(1, 4)) + ")",
-        "g2 AS (SELECT CAST(30 - b.best2 AS BIGINT) AS"
-        " converse_gap\n"
-        "         FROM b2 b)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT n.i, n.j, n.x AS nw_x,\n"
-        "       m.monge_viol, f.feas_viol, c.nwcost, o.best,\n"
-        "       o.n_plans, h.hoffman_viol, w.anti_corners,\n"
-        "       g.converse_gap, l.n_docs\n"
-        "FROM nw n CROSS JOIN mgv m CROSS JOIN fs f\n"
-        "CROSS JOIN nc c CROSS JOIN op o CROSS JOIN hv h\n"
-        "CROSS JOIN w2 w CROSS JOIN g2 g CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q719_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q719_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{c2}", _Q719_C2))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q719_monge_northwest",
-       "WITH " + _q719_join("documents", "//", " MATERIALIZED"))
-def q719(spark, sf_dir):
-    """Monge matrices and the northwest-corner rule — greedy
-    transportation optimality certified by TOTAL plan
-    exhaustion, with the converse witnessed (Monge 1781,
-    Hoffman 1963: on a Monge cost matrix the trivial NW-corner
-    filling is already optimal — the property underneath
-    SMAWK, quadrangle-inequality DP speedups, and one-
-    dimensional optimal transport).  Supplies and demands
-    derive from the corpus (totals fixed at 12, so the
-    instance moves with SF); the cost c(i,j) = (i-j)^2 + i + j
-    is certified Monge at all four corners (monge_viol == 0 —
-    the quadrangle inequality checked, not assumed).  The NW
-    plan computes in CLOSED FORM — x_ij = max(0, min(S_i, D_j)
-    - max(S_{i-1}, D_{j-1})) on cumulative sums, no sequential
-    filling — and is certified feasible (feas_viol == 0).
-    Every feasible integer plan then materializes (four free
-    cells swept, the rest forced; n_plans emitted) and the NW
-    cost equals the exhaustive minimum EXACTLY (hoffman_viol
-    == 0).  The converse is a checked witness, not folklore:
-    the inlined anti-Monge cost matrix (one violated corner,
-    anti_corners >= 1) makes the same NW plan pay 30 against
-    an exhaustive optimum of 29 (converse_gap == 1) — greedy
-    genuinely needs the Monge property.  Scale: a 28k-row
-    plan sweep against dims; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q719_documents")
-    parts, fin = _q719_sql("q719_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q719_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{c2}", _Q719_C2))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("x13", "i3", "c2t", "sd", "cm", "nw", "pl"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q719_{nm}",
-                      max_rows=30000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q720: triangle inequalities — Weitzenbock, Euler R >= 2r, and
-# Ono's corrected inequality with its obtuse failures counted
-
-
-def _q720_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"s24 AS (SELECT DISTINCT CAST(doc_id % 24 + 1 AS"
-        f" BIGINT) AS v FROM {tbl})",
-        # all 1378 integer triangles with sides <= 24
-        "tr AS{mat} (SELECT a.v AS a, b.v AS b, c.v AS c,\n"
-        "           (a.v + b.v + c.v)*(a.v + b.v - c.v)\n"
-        "             *(a.v - b.v + c.v)*(0 - a.v + b.v + c.v)"
-        " AS h16,\n"
-        "           (b.v*b.v + c.v*c.v - a.v*a.v)\n"
-        "             *(c.v*c.v + a.v*a.v - b.v*b.v)\n"
-        "             *(a.v*a.v + b.v*b.v - c.v*c.v) AS pp,\n"
-        "           CASE WHEN b.v*b.v + c.v*c.v > a.v*a.v AND\n"
-        "             c.v*c.v + a.v*a.v > b.v*b.v AND\n"
-        "             a.v*a.v + b.v*b.v > c.v*c.v THEN 1 ELSE"
-        " 0 END\n"
-        "             AS acute\n"
-        "         FROM s24 a JOIN s24 b ON b.v >= a.v\n"
-        "         JOIN s24 c ON c.v >= b.v\n"
-        "         WHERE a.v + b.v > c.v)",
-        "cv AS (SELECT\n"
-        "           CAST(count(*) AS BIGINT) AS n_tri,\n"
-        "           CAST(sum(acute) AS BIGINT) AS n_acute,\n"
-        # Weitzenbock: (a^2+b^2+c^2)^2 >= 48 A^2 = 3 h16
-        "           CAST(sum(CASE WHEN (a*a + b*b + c*c)\n"
-        "             *(a*a + b*b + c*c) < 3*h16 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS weitzenbock_viol,\n"
-        # Euler R >= 2r: abc(a+b+c) >= 16 A^2
-        "           CAST(sum(CASE WHEN a*b*c*(a + b + c) <"
-        " h16\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " euler_viol,\n"
-        # Ono (corrected): acute => 27 p^2 <= h16^3
-        "           CAST(sum(CASE WHEN acute = 1 AND\n"
-        "             27*pp*pp > h16*h16*h16 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS ono_acute_viol,\n"
-        # ... and the original unrestricted claim FAILS often
-        "           CAST(sum(CASE WHEN acute = 0 AND\n"
-        "             27*pp*pp > h16*h16*h16 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS ono_obtuse_failures\n"
-        "         FROM tr)",
-        # the equality witnesses: equilateral rows attain both
-        # Weitzenbock and Ono with equality
-        "eqw AS (SELECT CAST(sum(CASE WHEN a = b AND b = c"
-        " AND\n"
-        "           ((a*a + b*b + c*c)*(a*a + b*b + c*c) <>"
-        " 3*h16\n"
-        "           OR 27*pp*pp <> h16*h16*h16) THEN 1 ELSE 0"
-        " END)\n"
-        "           AS BIGINT) AS equality_viol FROM tr)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.a, t.b, t.c, t.h16, t.acute,\n"
-        "       v.n_tri, v.n_acute, v.weitzenbock_viol,\n"
-        "       v.euler_viol, v.ono_acute_viol,\n"
-        "       v.ono_obtuse_failures, w.equality_viol,"
-        " l.n_docs\n"
-        "FROM tr t CROSS JOIN cv v CROSS JOIN eqw w\n"
-        "CROSS JOIN ld l WHERE t.a = t.b AND t.b = t.c")
-    return parts, fin
-
-
-def _q720_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q720_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q720_triangle_inequalities",
-       "WITH " + _q720_join("documents", "//", " MATERIALIZED"))
-def q720(spark, sf_dir):
-    """Weitzenbock, Euler's R >= 2r, and Ono's inequality over
-    every integer triangle with sides <= 24 — squared into
-    exact integer arithmetic, with Ono's famous FALSE original
-    claim quantified (Weitzenbock 1919: a^2+b^2+c^2 >= 4
-    sqrt(3) K; Euler 1765: circumradius at least twice
-    inradius; Ono 1914 claimed 27 prod(b^2+c^2-a^2)^2 <=
-    (4K^2)^3 for ALL triangles — Balitrand's 1916 correction
-    restricts it to acute ones, a cautionary tale about
-    unchecked generality).  All 1378 triangles sweep through
-    Heron's 16 K^2 polynomial; every irrational inequality is
-    squared into an integer one: Weitzenbock becomes
-    (a^2+b^2+c^2)^2 >= 3 h16 (zero violations), Euler becomes
-    abc(a+b+c) >= h16 (zero violations — R >= 2r with both
-    radii eliminated), and Ono's corrected form 27 p^2 <=
-    h16^3 holds at EVERY acute triangle (ono_acute_viol == 0)
-    while the unrestricted claim fails at 492 obtuse ones
-    (ono_obtuse_failures == 492, first at (2,3,4)) — the
-    counterexample set counted, not anecdotal.  Equality
-    diagnostics: every equilateral row attains Weitzenbock AND
-    Ono with exact equality (equality_viol == 0), and the
-    emitted rows are precisely the 24 equilateral triangles
-    where all three inequalities pinch.  Scale: one 1378-row
-    sweep of degree-12 integer polynomials, all within BIGINT
-    by the side bound chosen for exactly that reason."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q720_documents")
-    parts, fin = _q720_sql("q720_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q720_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("s24", "tr"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q720_{nm}",
-                      max_rows=2000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q721: Langford pairings — counts by exhaustive placement DP,
-# with the mod-4 parity obstruction exactly tight in range
-
-
-def _q721_sql(tbl: str, d: str, mat: str):
-    cp = "(CASE {c} WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 WHEN 7 THEN 128 WHEN 8 THEN 256 WHEN 9 THEN 512 WHEN 10 THEN 1024 WHEN 11 THEN 2048 WHEN 12 THEN 4096 WHEN 13 THEN 8192 END)"
-    parts = [
-        f"nd AS (SELECT DISTINCT CAST(doc_id % 5 + 3 AS"
-        f" BIGINT) AS n FROM {tbl})",
-        f"ps AS (SELECT DISTINCT CAST(doc_id % 14 AS BIGINT)"
-        f" AS p FROM {tbl})",
-        "s0 AS (SELECT n, CAST(0 AS BIGINT) AS mk,\n"
-        "           CAST(1 AS BIGINT) AS w FROM nd)",
-    ]
-    for s in range(1, 8):
-        # stage s places number k = n - s + 1 (frozen if k < 1)
-        parts.append(
-            f"s{s} AS{{mat}} (SELECT t.n, t.mk, CAST(sum(t.w)"
-            f" AS BIGINT) AS w FROM (\n"
-            f"           SELECT x.n, x.mk + " + cp.format(
-                c="p.p") + "\n"
-            f"             + " + cp.format(
-                c="p.p + x.n - " + str(s) + " + 2") + " AS mk,"
-            f" x.w\n"
-            f"           FROM s{s - 1} x JOIN ps p ON\n"
-            f"             x.n - {s} + 1 >= 1 AND\n"
-            f"             p.p + x.n - {s} + 2 <= 2*x.n - 1"
-            f" AND\n"
-            f"             (x.mk {{d}} " + cp.format(c="p.p")
-            + ") % 2 = 0 AND\n"
-            f"             (x.mk {{d}} " + cp.format(
-                c="p.p + x.n - " + str(s) + " + 2")
-            + ") % 2 = 0\n"
-            f"           UNION ALL\n"
-            f"           SELECT x.n, x.mk, x.w FROM s{s - 1} x\n"
-            f"           WHERE x.n - {s} + 1 < 1) t\n"
-            f"         GROUP BY t.n, t.mk)")
-    parts += [
-        "ct AS{mat} (SELECT d2.n,\n"
-        "           CAST(coalesce(sum(s.w), 0) {d} 2 AS"
-        " BIGINT) AS cnt\n"
-        "         FROM nd d2 LEFT JOIN s7 s ON s.n = d2.n\n"
-        "         GROUP BY d2.n)",
-        # the parity obstruction: n(2n+1) - n(n+1)/2 - n even
-        # exactly when a pairing can exist — tight in range
-        "pv AS (SELECT CAST(sum(CASE WHEN\n"
-        "           (CASE WHEN (c.n*(2*c.n + 1) -"
-        " (c.n*(c.n + 1))\n"
-        "             {d} 2 - c.n) % 2 = 0 THEN 1 ELSE 0 END)"
-        " <>\n"
-        "           (CASE WHEN c.cnt > 0 THEN 1 ELSE 0 END)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " parity_viol\n"
-        "         FROM ct c)",
-        "hx AS (SELECT CAST(n AS BIGINT) AS n, CAST(c AS"
-        " BIGINT) AS c\n"
-        "         FROM (VALUES (3, 1), (4, 1), (5, 0), (6,"
-        " 0),\n"
-        "           (7, 26)) t(n, c))",
-        "hv AS (SELECT CAST(sum(CASE WHEN c.cnt <> x.c THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS count_viol\n"
-        "         FROM ct c JOIN hx x ON x.n = c.n)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT c.n, c.cnt, x.c AS expected,\n"
-        "       CASE WHEN (c.n*(2*c.n + 1) - (c.n*(c.n + 1))"
-        " {d} 2\n"
-        "         - c.n) % 2 = 0 THEN 1 ELSE 0 END AS"
-        " parity_admits,\n"
-        "       p.parity_viol, v.count_viol, l.n_docs\n"
-        "FROM ct c JOIN hx x ON x.n = c.n\n"
-        "CROSS JOIN pv p CROSS JOIN hv v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q721_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q721_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return (",\n       ".join(out) + "\n"
-            + fin.replace("{d}", d))
-
-
-@query("q721_langford_pairings",
-       "WITH " + _q721_join("documents", "//", " MATERIALIZED"))
-def q721(spark, sf_dir):
-    """Langford pairings counted by exhaustive placement DP for
-    n = 3..7, with the mod-4 obstruction shown EXACTLY tight
-    in range (Langford 1958, watching his son stack colored
-    blocks: arrange 1,1,2,2,...,n,n so the two copies of k
-    have exactly k items between them; solutions exist iff
-    n = 0 or 3 mod 4).  The DP places numbers n down to 1 as
-    seven unrolled stages over (n, occupancy-mask, ways)
-    states — each stage a position join with two CASE-
-    dispatched free-bit tests, all five n values riding ONE
-    chain with finished rows frozen — and total placements
-    halve into reversal classes: counts 1, 1, 0, 0, 26 for
-    n = 3..7 (count_viol == 0 against the pinned census; the
-    26 for n = 7 is the classic value, found by sweep).  The
-    position-sum parity argument — summing 2p_k + k + 1 over
-    all numbers forces n(2n+1) - n(n+1)/2 - n to be even —
-    computes as integer arithmetic per n, and in this range
-    the obstruction is EXACTLY the truth: parity admits a
-    pairing precisely when one exists (parity_viol == 0, both
-    directions at every n) — the necessary condition is also
-    sufficient here, which is the theorem's mod-4 content.
-    Scale: a staged mask DP whose state count is bounded by
-    solutions, not by 2^14; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q721_documents")
-    parts, fin = _q721_sql("q721_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q721_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("nd", "ps", "ct") or \
-                (nm[0] == "s" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q721_{nm}",
-                      max_rows=200000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin).replace("{d}", "div"))
-
-
-# ---------------------------------------------------------------------------
-# q722: Schur and van der Waerden numbers — Ramsey theory on
-# the integers, boundaries located by total coloring exhaustion
-
-
-def _q722_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d32 AS (SELECT DISTINCT CAST(doc_id % 32 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"d16 AS (SELECT DISTINCT CAST(doc_id % 16 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        "mm AS{mat} (SELECT hi.b*16 + lo.b AS m\n"
-        "         FROM d32 hi CROSS JOIN d16 lo)",
-        # per coloring: monochromatic Schur triples (x+y=z) and
-        # monochromatic 3-APs, at both boundary lengths
-        "sc AS{mat} (SELECT g.m,\n"
-        "           CAST((CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 1) % 2) AND ((g.m {d} 1) % 2) = ((g.m {d} 2) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 2) % 2) AND ((g.m {d} 2) % 2) = ((g.m {d} 4) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 4) % 2) AND ((g.m {d} 4) % 2) = ((g.m {d} 8) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 8) % 2) AND ((g.m {d} 8) % 2) = ((g.m {d} 16) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 2) % 2) AND ((g.m {d} 2) % 2) = ((g.m {d} 8) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 4) % 2) AND ((g.m {d} 4) % 2) = ((g.m {d} 16) % 2) THEN 1 ELSE 0 END) AS BIGINT) AS s5,\n"
-        "           CAST((CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 1) % 2) AND ((g.m {d} 1) % 2) = ((g.m {d} 2) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 2) % 2) AND ((g.m {d} 2) % 2) = ((g.m {d} 4) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 4) % 2) AND ((g.m {d} 4) % 2) = ((g.m {d} 8) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 2) % 2) AND ((g.m {d} 2) % 2) = ((g.m {d} 8) % 2) THEN 1 ELSE 0 END) AS BIGINT) AS s4,\n"
-        "           CAST((CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 2) % 2) AND ((g.m {d} 2) % 2) = ((g.m {d} 4) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 4) % 2) AND ((g.m {d} 4) % 2) = ((g.m {d} 16) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 8) % 2) AND ((g.m {d} 8) % 2) = ((g.m {d} 64) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 16) % 2) AND ((g.m {d} 16) % 2) = ((g.m {d} 256) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 4) % 2) AND ((g.m {d} 4) % 2) = ((g.m {d} 8) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 8) % 2) AND ((g.m {d} 8) % 2) = ((g.m {d} 32) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 16) % 2) AND ((g.m {d} 16) % 2) = ((g.m {d} 128) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 4) % 2) = ((g.m {d} 8) % 2) AND ((g.m {d} 8) % 2) = ((g.m {d} 16) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 4) % 2) = ((g.m {d} 16) % 2) AND ((g.m {d} 16) % 2) = ((g.m {d} 64) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 4) % 2) = ((g.m {d} 32) % 2) AND ((g.m {d} 32) % 2) = ((g.m {d} 256) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 8) % 2) = ((g.m {d} 16) % 2) AND ((g.m {d} 16) % 2) = ((g.m {d} 32) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 8) % 2) = ((g.m {d} 32) % 2) AND ((g.m {d} 32) % 2) = ((g.m {d} 128) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 16) % 2) = ((g.m {d} 32) % 2) AND ((g.m {d} 32) % 2) = ((g.m {d} 64) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 16) % 2) = ((g.m {d} 64) % 2) AND ((g.m {d} 64) % 2) = ((g.m {d} 256) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 32) % 2) = ((g.m {d} 64) % 2) AND ((g.m {d} 64) % 2) = ((g.m {d} 128) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 64) % 2) = ((g.m {d} 128) % 2) AND ((g.m {d} 128) % 2) = ((g.m {d} 256) % 2) THEN 1 ELSE 0 END) AS BIGINT) AS v9,\n"
-        "           CAST((CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 2) % 2) AND ((g.m {d} 2) % 2) = ((g.m {d} 4) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 4) % 2) AND ((g.m {d} 4) % 2) = ((g.m {d} 16) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2) = ((g.m {d} 8) % 2) AND ((g.m {d} 8) % 2) = ((g.m {d} 64) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 4) % 2) AND ((g.m {d} 4) % 2) = ((g.m {d} 8) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 8) % 2) AND ((g.m {d} 8) % 2) = ((g.m {d} 32) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 2) % 2) = ((g.m {d} 16) % 2) AND ((g.m {d} 16) % 2) = ((g.m {d} 128) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 4) % 2) = ((g.m {d} 8) % 2) AND ((g.m {d} 8) % 2) = ((g.m {d} 16) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 4) % 2) = ((g.m {d} 16) % 2) AND ((g.m {d} 16) % 2) = ((g.m {d} 64) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 8) % 2) = ((g.m {d} 16) % 2) AND ((g.m {d} 16) % 2) = ((g.m {d} 32) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 8) % 2) = ((g.m {d} 32) % 2) AND ((g.m {d} 32) % 2) = ((g.m {d} 128) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 16) % 2) = ((g.m {d} 32) % 2) AND ((g.m {d} 32) % 2) = ((g.m {d} 64) % 2) THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 32) % 2) = ((g.m {d} 64) % 2) AND ((g.m {d} 64) % 2) = ((g.m {d} 128) % 2) THEN 1 ELSE 0 END) AS BIGINT) AS v8\n"
-        "         FROM mm g)",
-        "cv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN m < 32 AND s5 = 0"
-        " THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS schur5_free,\n"
-        "           CAST(sum(CASE WHEN m < 16 AND s4 = 0"
-        " THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS schur4_free,\n"
-        "           CAST(sum(CASE WHEN v9 = 0 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS vdw9_free,\n"
-        "           CAST(sum(CASE WHEN m < 256 AND v8 = 0"
-        " THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS vdw8_free\n"
-        "         FROM sc)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.inst, t.n, t.freec, t.expected,\n"
-        "       l.n_docs\n"
-        "FROM (SELECT CAST(0 AS BIGINT) AS inst, CAST(5 AS"
-        " BIGINT) AS n,\n"
-        "         c.schur5_free AS freec, CAST(0 AS BIGINT)"
-        " AS expected\n"
-        "       FROM cv c\n"
-        "       UNION ALL SELECT 1, 4, c.schur4_free, 2 FROM"
-        " cv c\n"
-        "       UNION ALL SELECT 2, 9, c.vdw9_free, 0 FROM cv"
-        " c\n"
-        "       UNION ALL SELECT 3, 8, c.vdw8_free, 6 FROM cv"
-        " c) t\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q722_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q722_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return (",\n       ".join(out) + "\n"
-            + fin.replace("{d}", d))
-
-
-@query("q722_schur_vanderwaerden",
-       "WITH " + _q722_join("documents", "//", " MATERIALIZED"))
-def q722(spark, sf_dir):
-    """Schur and van der Waerden numbers located by total
-    coloring exhaustion — S(2) = 5 and W(3,2) = 9, each shown
-    by a zero count on one side of the boundary and a positive
-    census on the other (Schur 1917, proved en route to
-    Fermat's Last Theorem mod p; van der Waerden 1927, the
-    seed of Ramsey theory on the integers).  All 512 two-
-    colorings of 1..9 materialize as bitmasks; ONE projection
-    counts, per coloring, its monochromatic Schur triples
-    x + y = z within 1..5 and 1..4, and its monochromatic
-    3-term arithmetic progressions within 1..9 and 1..8.  The
-    four censuses land exactly: NO coloring of 1..5 avoids a
-    monochromatic x + y = z (schur5_free == 0) while exactly 2
-    colorings of 1..4 do — {1,4}/{2,3} and its swap, the
-    extremal witnesses counted; NO coloring of 1..9 avoids a
-    monochromatic 3-AP (vdw9_free == 0) while exactly 6
-    colorings of 1..8 do (the {1,2,5,6}-pattern family) — so
-    S(2) = 5 and W(3,2) = 9 are pinned from both sides by
-    sweep, the lower bounds by explicit counted witnesses
-    rather than constructions.  Scale: one 512-row projection
-    with 40 CASE terms; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q722_documents")
-    parts, fin = _q722_sql("q722_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q722_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d32", "d16", "mm", "sc"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q722_{nm}",
-                      max_rows=1000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin).replace("{d}", "div"))
-
-
-# ---------------------------------------------------------------------------
-# q723: Sidon sets — the maximum B2 subset of 1..13 by total
-# sweep, and the Singer perfect difference set mod 13
-
-
-def _q723_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d64 AS (SELECT DISTINCT CAST(doc_id % 64 AS BIGINT)"
-        f" AS b FROM {tbl})",
-        f"d128 AS (SELECT DISTINCT CAST(doc_id % 128 AS"
-        f" BIGINT) AS b FROM {tbl})",
-        f"r13 AS (SELECT DISTINCT CAST(doc_id % 13 AS BIGINT)"
-        f" AS r FROM {tbl})",
-        "dst AS (SELECT CAST(v AS BIGINT) AS v FROM (VALUES"
-        " (0), (1),\n"
-        "           (3), (9)) t(v))",
-        "mm AS{mat} (SELECT hi.b*128 + lo.b AS m\n"
-        "         FROM d64 hi CROSS JOIN d128 lo)",
-        # per subset: size and repeated-difference count
-        "sv AS{mat} (SELECT g.m,\n"
-        "           CAST(((g.m {d} 1) % 2) + ((g.m {d} 2) % 2) + ((g.m {d} 4) % 2) + ((g.m {d} 8) % 2) + ((g.m {d} 16) % 2) + ((g.m {d} 32) % 2) + ((g.m {d} 64) % 2) + ((g.m {d} 128) % 2) + ((g.m {d} 256) % 2) + ((g.m {d} 512) % 2) + ((g.m {d} 1024) % 2) + ((g.m {d} 2048) % 2) + ((g.m {d} 4096) % 2) AS BIGINT) AS sz,\n"
-        "           CAST((CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 2) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 4) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 8) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 16) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 32) % 2) + ((g.m {d} 32) % 2)*((g.m {d} 64) % 2) + ((g.m {d} 64) % 2)*((g.m {d} 128) % 2) + ((g.m {d} 128) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 256) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 512) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 1024) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 2048) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 4) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 8) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 16) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 32) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 64) % 2) + ((g.m {d} 32) % 2)*((g.m {d} 128) % 2) + ((g.m {d} 64) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 128) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 256) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 512) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 1024) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 8) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 16) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 32) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 64) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 128) % 2) + ((g.m {d} 32) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 64) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 128) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 256) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 512) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 16) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 32) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 64) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 128) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 32) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 64) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 128) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 256) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 32) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 64) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 128) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 32) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 64) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 128) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 64) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 128) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 32) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 64) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 128) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 32) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 256) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 16) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 512) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 8) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 1024) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 4) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 2048) % 2) + ((g.m {d} 2) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) + (CASE WHEN ((g.m {d} 1) % 2)*((g.m {d} 4096) % 2) >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS rep\n"
-        "         FROM mm g)",
-        "mx AS (SELECT CAST(max(CASE WHEN rep = 0 THEN sz"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS max_sidon,\n"
-        "           CAST(sum(CASE WHEN rep = 0 AND sz =\n"
-        "             (SELECT max(CASE WHEN rep = 0 THEN sz"
-        " ELSE 0 END)\n"
-        "               FROM sv) THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "             AS n_extremal\n"
-        "         FROM sv)",
-        # Singer perfect difference set {0,1,3,9} mod 13: every
-        # nonzero residue arises as a difference EXACTLY once
-        "pd2 AS (SELECT CAST(sum(CASE WHEN t.c <> 1 THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS pds_viol,\n"
-        "           CAST(count(*) AS BIGINT) AS n_residues\n"
-        "         FROM (SELECT r.r, (SELECT count(*) FROM dst"
-        " a, dst b\n"
-        "             WHERE a.v <> b.v AND (a.v - b.v + 13) %"
-        " 13 = r.r)\n"
-        "             AS c\n"
-        "           FROM r13 r WHERE r.r >= 1) t)",
-        # the lambda identity k(k-1) = lambda (v-1): 4*3 = 1*12
-        "li AS (SELECT CAST(CASE WHEN 4*3 <> 1*12 THEN 1 ELSE"
-        " 0 END\n"
-        "           AS BIGINT) AS lambda_viol)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT s.m AS sidon_mask, s.sz,\n"
-        "       x.max_sidon, x.n_extremal, p.pds_viol,\n"
-        "       p.n_residues, i.lambda_viol, l.n_docs\n"
-        "FROM sv s CROSS JOIN mx x CROSS JOIN pd2 p\n"
-        "CROSS JOIN li i CROSS JOIN ld l\n"
-        "WHERE s.rep = 0 AND s.sz = x.max_sidon")
-    return parts, fin
-
-
-def _q723_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q723_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q723_sidon_sets",
-       "WITH " + _q723_join("documents", "//", " MATERIALIZED"))
-def q723(spark, sf_dir):
-    """Sidon sets — the maximum B2 subset of 1..13 found by
-    total 8192-subset sweep, beside the Singer perfect
-    difference set mod 13 with every nonzero difference hit
-    exactly once (Sidon 1932, for Fourier reasons; Singer 1938
-    from projective planes — B2 sets are the integer sequences
-    with all pairwise differences distinct, the combinatorial
-    core of radar rulers, Costas arrays, and sparse-recovery
-    measurement designs).  Every subset of 1..13 is a bitmask;
-    one projection computes its size and its repeated-
-    difference count (for each gap d, whether two pairs at
-    that gap coexist — 78 bit products).  The sweep finds
-    max_sidon == 5 with EXACTLY 22 extremal sets — all
-    emitted as rows, perfect rulers of length 13 — so F(13) =
-    5 is pinned by exhaustion (the Erdos–Turan sqrt(n) ceiling
-    in miniature: 5 > sqrt(13) barely).  The cyclic sibling:
-    the Singer set {0, 1, 3, 9} mod 13 (q687's Fano difference
-    set one plane up, PG(2,3)'s line) realizes every nonzero
-    residue as a difference EXACTLY once (pds_viol == 0 over
-    all 12 residues) with the design identity k(k-1) =
-    lambda(v-1) checked — a perfect difference set, the object
-    that makes Singer's projective-plane construction tick.
-    Scale: one 8192-row projection; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q723_documents")
-    parts, fin = _q723_sql("q723_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q723_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d64", "d128", "r13", "dst", "mm", "sv"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q723_{nm}",
-                      max_rows=10000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q724: the Perrin primality test — exactly correct below its
-# first pseudoprime, by trace-of-matrix-power sweep to 1000
-
-
-_Q724_SEED = "CAST(1 AS BIGINT) AS r11, CAST(0 AS BIGINT) AS r12, CAST(0 AS BIGINT) AS r13, CAST(0 AS BIGINT) AS r21, CAST(1 AS BIGINT) AS r22, CAST(0 AS BIGINT) AS r23, CAST(0 AS BIGINT) AS r31, CAST(0 AS BIGINT) AS r32, CAST(1 AS BIGINT) AS r33, CAST(0 AS BIGINT) AS b11, CAST(1 AS BIGINT) AS b12, CAST(0 AS BIGINT) AS b13, CAST(0 AS BIGINT) AS b21, CAST(0 AS BIGINT) AS b22, CAST(1 AS BIGINT) AS b23, CAST(1 AS BIGINT) AS b31, CAST(1 AS BIGINT) AS b32, CAST(0 AS BIGINT) AS b33"
-_Q724_STAGES = ['n, CASE WHEN (n {d} 1) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 1) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 1) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 1) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 1) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 1) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 1) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 1) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 1) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 2) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 2) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 2) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 2) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 2) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 2) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 2) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 2) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 2) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 4) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 4) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 4) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 4) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 4) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 4) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 4) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 4) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 4) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 8) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 8) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 8) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 8) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 8) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 8) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 8) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 8) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 8) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 16) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 16) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 16) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 16) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 16) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 16) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 16) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 16) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 16) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 32) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 32) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 32) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 32) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 32) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 32) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 32) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 32) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 32) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 64) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 64) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 64) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 64) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 64) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 64) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 64) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 64) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 64) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 128) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 128) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 128) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 128) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 128) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 128) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 128) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 128) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 128) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 256) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 256) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 256) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 256) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 256) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 256) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 256) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 256) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 256) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33', 'n, CASE WHEN (n {d} 512) % 2 = 1 THEN (r11*b11 + r12*b21 + r13*b31) % n ELSE r11 END AS r11, CASE WHEN (n {d} 512) % 2 = 1 THEN (r11*b12 + r12*b22 + r13*b32) % n ELSE r12 END AS r12, CASE WHEN (n {d} 512) % 2 = 1 THEN (r11*b13 + r12*b23 + r13*b33) % n ELSE r13 END AS r13, CASE WHEN (n {d} 512) % 2 = 1 THEN (r21*b11 + r22*b21 + r23*b31) % n ELSE r21 END AS r21, CASE WHEN (n {d} 512) % 2 = 1 THEN (r21*b12 + r22*b22 + r23*b32) % n ELSE r22 END AS r22, CASE WHEN (n {d} 512) % 2 = 1 THEN (r21*b13 + r22*b23 + r23*b33) % n ELSE r23 END AS r23, CASE WHEN (n {d} 512) % 2 = 1 THEN (r31*b11 + r32*b21 + r33*b31) % n ELSE r31 END AS r31, CASE WHEN (n {d} 512) % 2 = 1 THEN (r31*b12 + r32*b22 + r33*b32) % n ELSE r32 END AS r32, CASE WHEN (n {d} 512) % 2 = 1 THEN (r31*b13 + r32*b23 + r33*b33) % n ELSE r33 END AS r33, (b11*b11 + b12*b21 + b13*b31) % n AS b11, (b11*b12 + b12*b22 + b13*b32) % n AS b12, (b11*b13 + b12*b23 + b13*b33) % n AS b13, (b21*b11 + b22*b21 + b23*b31) % n AS b21, (b21*b12 + b22*b22 + b23*b32) % n AS b22, (b21*b13 + b22*b23 + b23*b33) % n AS b23, (b31*b11 + b32*b21 + b33*b31) % n AS b31, (b31*b12 + b32*b22 + b33*b32) % n AS b32, (b31*b13 + b32*b23 + b33*b33) % n AS b33']
-
-
-def _q724_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"d50 AS (SELECT DISTINCT CAST(doc_id % 50 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        f"d20 AS (SELECT DISTINCT CAST(doc_id % 20 AS BIGINT)"
-        f" AS a FROM {tbl})",
-        f"dv AS (SELECT DISTINCT CAST(doc_id % 30 + 2 AS"
-        f" BIGINT) AS q FROM {tbl})",
-        "nn AS{mat} (SELECT hi.a*20 + lo.a + 2 AS n\n"
-        "         FROM d50 hi CROSS JOIN d20 lo\n"
-        "         WHERE hi.a*20 + lo.a + 2 <= 1000)",
-        # trial-division ground truth
-        "pr AS{mat} (SELECT t.n, CASE WHEN t.nf = 0 THEN 1"
-        " ELSE 0 END\n"
-        "           AS isp FROM (\n"
-        "           SELECT n.n, sum(CASE WHEN q.q < n.n AND\n"
-        "             q.q*q.q <= n.n AND n.n % q.q = 0 THEN 1\n"
-        "             ELSE 0 END) AS nf\n"
-        "           FROM nn n CROSS JOIN dv q GROUP BY n.n)"
-        " t)",
-        "t0 AS (SELECT n, " + _Q724_SEED + " FROM nn)",
-    ]
-    for s, cols in enumerate(_Q724_STAGES):
-        parts.append(f"t{s + 1} AS{{mat}} (SELECT " + cols
-                     + f" FROM t{s})")
-    parts += [
-        # Perrin: P(n) = trace(M^n); the test is P(n) = 0 mod n
-        "pv AS{mat} (SELECT t.n,\n"
-        "           CASE WHEN (t.r11 + t.r22 + t.r33) % t.n ="
-        " 0\n"
-        "             THEN 1 ELSE 0 END AS perrin FROM t10 t)",
-        "cv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN v.perrin <> p.isp"
-        " THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS iff_viol,\n"
-        "           CAST(sum(p.isp) AS BIGINT) AS n_primes,\n"
-        "           CAST(sum(v.perrin) AS BIGINT) AS"
-        " n_perrin\n"
-        "         FROM pv v JOIN pr p ON p.n = v.n)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT v.n, v.perrin, p.isp,\n"
-        "       c.iff_viol, c.n_primes, c.n_perrin, l.n_docs\n"
-        "FROM pv v JOIN pr p ON p.n = v.n\n"
-        "CROSS JOIN cv c CROSS JOIN ld l\n"
-        "WHERE v.n <= 50 OR v.perrin = 1")
-    return parts, fin
-
-
-def _q724_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q724_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q724_perrin_test",
-       "WITH " + _q724_join("documents", "//", " MATERIALIZED"))
-def q724(spark, sf_dir):
-    """The Perrin primality test swept to 1000 — exactly
-    correct in range, because its first lie lives at 271441
-    (Perrin 1899 observed P(p) = 0 mod p for primes and asked
-    about the converse; Adams & Shanks 1982 found the first
-    Perrin pseudoprime 271441 = 521^2, so below it the test is
-    a perfect primality oracle — a false conjecture that is
-    exactly true in this query's whole universe).  The Perrin
-    number P(n) computes as the TRACE of the companion matrix
-    M = [[0,1,0],[0,0,1],[1,1,0]] to the n-th power mod n: ten
-    unrolled square-and-multiply stages carry both the
-    accumulator and the square as 3x3 matrix columns (nine
-    entries each, every product a three-term mod-n sum) over
-    all 999 moduli simultaneously.  Ground truth is relational
-    trial division; the certificate is the genuine in-range
-    IFF: P(n) = 0 mod n EXACTLY when n is prime, for every
-    2 <= n <= 1000 (iff_viol == 0, n_perrin == n_primes ==
-    168) — the forward direction is Perrin's theorem (a trace/
-    Frobenius argument), the reverse is the empirical miracle
-    that holds until 271441.  Scale: ten column-arithmetic
-    matrix stages over a 999-row dim — a modular linear-
-    algebra sweep in pure codegen."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q724_documents")
-    parts, fin = _q724_sql("q724_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q724_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("d50", "d20", "dv", "nn", "pr", "pv") or \
-                (nm[0] == "t" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q724_{nm}",
-                      max_rows=1200)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q725: exponential Diophantine sweeps — Catalan in range and
-# the complete Ramanujan–Nagell quintuple
-
-
-def _q725_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"ab AS (SELECT DISTINCT CAST(doc_id % 99 + 2 AS"
-        f" BIGINT) AS a FROM {tbl})",
-        f"bx AS (SELECT DISTINCT CAST(doc_id % 12 + 2 AS"
-        f" BIGINT) AS b FROM {tbl})",
-        f"xr AS (SELECT DISTINCT CAST(doc_id % 200 + 1 AS"
-        f" BIGINT) AS x FROM {tbl})",
-        f"nr AS (SELECT DISTINCT CAST(doc_id % 16 + 1 AS"
-        f" BIGINT) AS n FROM {tbl})",
-        # all perfect powers a^b <= 10000 (b >= 2), deduplicated
-        "pw AS{mat} (SELECT DISTINCT t.v FROM (\n"
-        "           SELECT CASE e.b WHEN 2 THEN CASE WHEN a.a <= 100 THEN a.a*a.a END WHEN 3 THEN CASE WHEN a.a <= 21 THEN a.a*a.a*a.a END WHEN 4 THEN CASE WHEN a.a <= 10 THEN a.a*a.a*a.a*a.a END WHEN 5 THEN CASE WHEN a.a <= 6 THEN a.a*a.a*a.a*a.a*a.a END WHEN 6 THEN CASE WHEN a.a <= 4 THEN a.a*a.a*a.a*a.a*a.a*a.a END WHEN 7 THEN CASE WHEN a.a <= 3 THEN a.a*a.a*a.a*a.a*a.a*a.a*a.a END WHEN 8 THEN CASE WHEN a.a <= 3 THEN a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a END WHEN 9 THEN CASE WHEN a.a <= 2 THEN a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a END WHEN 10 THEN CASE WHEN a.a <= 2 THEN a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a END WHEN 11 THEN CASE WHEN a.a <= 2 THEN a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a END WHEN 12 THEN CASE WHEN a.a <= 2 THEN a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a END WHEN 13 THEN CASE WHEN a.a <= 2 THEN a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a*a.a END END AS v\n"
-        "           FROM ab a CROSS JOIN bx e) t\n"
-        "         WHERE t.v IS NOT NULL AND t.v <= 10000)",
-        "ct AS (SELECT CAST(count(*) AS BIGINT) AS n_powers\n"
-        "         FROM pw)",
-        # consecutive perfect powers: Catalan/Mihailescu says
-        # only (8, 9); in range that is exactly what the sweep
-        # finds
-        "cp AS{mat} (SELECT a.v AS p1, b.v AS p2 FROM pw a\n"
-        "         JOIN pw b ON b.v = a.v + 1)",
-        "cc AS (SELECT CAST(count(*) AS BIGINT) AS n_consec,\n"
-        "           CAST(max(p1) AS BIGINT) AS wit1,\n"
-        "           CAST(max(p2) AS BIGINT) AS wit2 FROM cp)",
-        # Ramanujan–Nagell: x^2 + 7 = 2^n
-        "rn AS{mat} (SELECT x.x, n.n FROM xr x CROSS JOIN nr n\n"
-        "         WHERE x.x*x.x + 7 = CASE n.n WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 WHEN 7 THEN 128 WHEN 8 THEN 256 WHEN 9 THEN 512 WHEN 10 THEN 1024 WHEN 11 THEN 2048 WHEN 12 THEN 4096 WHEN 13 THEN 8192 WHEN 14 THEN 16384 WHEN 15 THEN 32768 WHEN 16 THEN 65536 END)",
-        "rv AS (SELECT CAST(count(*) AS BIGINT) AS n_rn,\n"
-        "           CAST(sum(CASE WHEN x IN (1, 3, 5, 11,"
-        " 181)\n"
-        "             THEN 0 ELSE 1 END) AS BIGINT) AS"
-        " rn_viol\n"
-        "         FROM rn)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT r.x, r.n, t.n_powers, c.n_consec, c.wit1,\n"
-        "       c.wit2, v.n_rn, v.rn_viol, l.n_docs\n"
-        "FROM rn r CROSS JOIN ct t CROSS JOIN cc c\n"
-        "CROSS JOIN rv v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q725_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q725_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q725_catalan_nagell",
-       "WITH " + _q725_join("documents", "//", " MATERIALIZED"))
-def q725(spark, sf_dir):
-    """Two exponential Diophantine classics by sweep — Catalan
-    in range and the complete Ramanujan–Nagell quintuple
-    (Catalan 1844 conjectured 8, 9 is the ONLY pair of
-    consecutive perfect powers, proved by Mihailescu 2002;
-    Ramanujan 1913 asked when x^2 + 7 is a power of two,
-    Nagell 1948 proved exactly five solutions — both are
-    statements whose in-range content a sweep can OWN).  All
-    124 perfect powers up to 10000 materialize from a base dim
-    and a CASE-dispatched exponent ladder whose per-arm bounds
-    keep every product in range (a^b evaluated only when a <=
-    floor(10000^(1/b)) — overflow fenced by construction);
-    the consecutive-pair self-join finds EXACTLY ONE pair,
-    (8, 9) = (2^3, 3^2) (n_consec == 1, witnesses emitted) —
-    Catalan's conjecture exactly as far as this universe
-    reaches, with the docstring honest that Mihailescu's proof
-    covers the rest.  Ramanujan–Nagell: the grid x <= 200,
-    n <= 16 yields exactly the five solutions x = 1, 3, 5, 11,
-    181 (n = 3, 4, 5, 7, 15; n_rn == 5, rn_viol == 0 against
-    the pinned set) — and here Nagell's theorem says the sweep
-    found EVERYTHING: there are no solutions beyond it at any
-    size, so the emitted rows are the complete answer, the
-    rare case where in-range IS the theorem.  Scale: dim
-    sweeps; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q725_documents")
-    parts, fin = _q725_sql("q725_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q725_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("ab", "bx", "xr", "nr", "pw", "cp", "rn"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q725_{nm}",
-                      max_rows=4000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q726: class numbers by reduced-form census — all nine Heegner
-# discriminants found in (-200, 0) by exhaustion
-
-
-_Q726_HEEG = '(-3), (-4), (-7), (-8), (-11), (-19), (-43), (-67), (-163)'
-
-
-def _q726_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"dv AS (SELECT DISTINCT CAST(doc_id % 199 + 1 AS"
-        f" BIGINT) AS v FROM {tbl})",
-        f"ad AS (SELECT DISTINCT CAST(doc_id % 8 + 1 AS"
-        f" BIGINT) AS a FROM {tbl})",
-        f"bd AS (SELECT DISTINCT CAST(doc_id % 17 - 8 AS"
-        f" BIGINT) AS b FROM {tbl})",
-        f"sq AS (SELECT DISTINCT CAST(doc_id % 13 + 2 AS"
-        f" BIGINT) AS s FROM {tbl})",
-        "hg AS (SELECT CAST(h AS BIGINT) AS h FROM (VALUES"
-        " {heeg}) t(h))",
-        # negative discriminants D = -v with D = 0 or 1 mod 4
-        "dd AS{mat} (SELECT -v AS dsc FROM dv\n"
-        "         WHERE (-v % 4 + 4) % 4 IN (0, 1))",
-        # reduced binary quadratic forms (a, b, c): b^2 - 4ac =
-        # D, |b| <= a <= c, b >= 0 on the boundary
-        "fm AS{mat} (SELECT w.dsc, a.a, b.b,\n"
-        "           (b.b*b.b - w.dsc) {d} (4*a.a) AS c\n"
-        "         FROM dd w CROSS JOIN ad a CROSS JOIN bd b\n"
-        "         WHERE abs(b.b) <= a.a\n"
-        "           AND (b.b*b.b - w.dsc) % (4*a.a) = 0\n"
-        "           AND (b.b*b.b - w.dsc) {d} (4*a.a) >= a.a\n"
-        "           AND NOT (b.b < 0 AND (abs(b.b) = a.a OR\n"
-        "             a.a = (b.b*b.b - w.dsc) {d} (4*a.a))))",
-        "hc AS{mat} (SELECT w.dsc, CAST(count(f.a) AS BIGINT)"
-        " AS h\n"
-        "         FROM dd w LEFT JOIN fm f ON f.dsc = w.dsc\n"
-        "         GROUP BY w.dsc)",
-        # fundamental discriminants: D = 1 mod 4 squarefree, or
-        # D = 4m with m = 2, 3 mod 4 squarefree
-        "fd AS{mat} (SELECT w.dsc FROM dd w\n"
-        "         LEFT JOIN sq s ON ((w.dsc % 4 + 4) % 4 = 1"
-        " AND\n"
-        "             abs(w.dsc) % (s.s*s.s) = 0)\n"
-        "           OR ((w.dsc % 4 + 4) % 4 = 0 AND\n"
-        "             abs(w.dsc {d} 4) % (s.s*s.s) = 0)\n"
-        "         WHERE ((w.dsc % 4 + 4) % 4 = 1 OR\n"
-        "           ((w.dsc % 4 + 4) % 4 = 0 AND\n"
-        "             ((w.dsc {d} 4) % 4 + 4) % 4 IN (2, 3)))\n"
-        "         GROUP BY w.dsc HAVING count(s.s) = 0)",
-        # the h = 1 fundamental census vs the nine Heegner
-        # numbers, both containments
-        "hv AS (SELECT CAST(\n"
-        "           (SELECT count(*) FROM fd f JOIN hc c ON\n"
-        "             c.dsc = f.dsc LEFT JOIN hg g ON g.h =\n"
-        "             f.dsc WHERE c.h = 1 AND g.h IS NULL)\n"
-        "           + (SELECT count(*) FROM hg g LEFT JOIN (\n"
-        "             SELECT f.dsc FROM fd f JOIN hc c ON\n"
-        "               c.dsc = f.dsc WHERE c.h = 1) t ON\n"
-        "             t.dsc = g.h WHERE t.dsc IS NULL)\n"
-        "           AS BIGINT) AS heegner_viol,\n"
-        "           (SELECT CAST(count(*) AS BIGINT) FROM fd"
-        " f\n"
-        "             JOIN hc c ON c.dsc = f.dsc WHERE"
-        " c.h = 1)\n"
-        "             AS n_class_one)",
-        # spot census: h(-23) = 3 (the first h = 3 field),
-        # h(-47) = 5
-        "sv AS (SELECT CAST(CASE WHEN a23.h <> 3 THEN 1 ELSE 0"
-        " END\n"
-        "           + CASE WHEN a47.h <> 5 THEN 1 ELSE 0 END\n"
-        "           AS BIGINT) AS census_viol\n"
-        "         FROM (SELECT h FROM hc WHERE dsc = -23)"
-        " a23\n"
-        "         CROSS JOIN (SELECT h FROM hc WHERE dsc ="
-        " -47) a47)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT g.h AS heegner_d, c.h AS class_number,\n"
-        "       v.heegner_viol, v.n_class_one, s.census_viol,\n"
-        "       l.n_docs\n"
-        "FROM hg g JOIN hc c ON c.dsc = g.h\n"
-        "CROSS JOIN hv v CROSS JOIN sv s CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q726_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q726_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{heeg}", _Q726_HEEG))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q726_heegner_class_numbers",
-       "WITH " + _q726_join("documents", "//", " MATERIALIZED"))
-def q726(spark, sf_dir):
-    """Class numbers of imaginary quadratic fields by reduced-
-    form census — all NINE Heegner discriminants found in
-    (-200, 0) by exhaustion (Gauss 1801 conjectured the class-
-    number-one list is complete; Heegner 1952 proved it, to
-    initial disbelief — the nine numbers -3, -4, -7, -8, -11,
-    -19, -43, -67, -163 behind e^(pi sqrt(163))'s near-integer
-    and the lucky primes of Euler's n^2 + n + 41).  Every
-    negative discriminant D = 0, 1 mod 4 above -200 gets its
-    Gauss class number h(D) as an exact reduced-form census —
-    forms (a, b, c) with b^2 - 4ac = D, |b| <= a <= c, and the
-    boundary sign convention, swept from dims with the
-    divisibility constraint doing the work.  Fundamentality
-    (D = 1 mod 4 squarefree, or 4m with m = 2, 3 mod 4
-    squarefree) computes by a square-divisor sweep.  The
-    certificate is both containments at once: the fundamental
-    discriminants with h = 1 are EXACTLY the nine Heegner
-    numbers (heegner_viol == 0, n_class_one == 9) — every
-    Heegner number verified class-number-one by its single
-    reduced form, and every other fundamental discriminant
-    above -200 exhibiting at least two — with the spot census
-    h(-23) = 3 (the first class-number-3 field) and h(-47) = 5
-    riding (census_viol == 0).  Scale: a 199 x 8 x 17 form
-    sweep; fixed cost, and since Heegner's theorem says the
-    list is complete at ALL sizes, the sweep's answer is the
-    whole story."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q726_documents")
-    parts, fin = _q726_sql("q726_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q726_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{heeg}", _Q726_HEEG))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("dv", "ad", "bd", "sq", "hg", "dd", "fm",
-                  "hc", "fd"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q726_{nm}",
-                      max_rows=30000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q727: Bang's theorem via cyclotomic values — primitive prime
-# divisors of 2^n - 1, the n = 6 exception isolated exactly
-
-
-_Q727_PHI = '(1, 1), (2, 3), (3, 7), (4, 5), (5, 31), (6, 3), (7, 127), (8, 17), (9, 73), (10, 11), (11, 2047), (12, 13), (13, 8191), (14, 43), (15, 151), (16, 257), (17, 131071), (18, 57), (19, 524287), (20, 205)'
-_Q727_MOB = '(1, 1), (2, -1), (3, -1), (4, 0), (5, -1), (6, 1), (7, -1), (8, 0), (9, 0), (10, 1), (11, -1), (12, 0), (13, -1), (14, 1), (15, 1), (16, 0), (17, -1), (18, 0), (19, -1), (20, 0)'
-_Q727_LPF = '(2, 2), (3, 3), (4, 2), (5, 5), (6, 3), (7, 7), (8, 2), (9, 3), (10, 5), (11, 11), (12, 3), (13, 13), (14, 7), (15, 5), (16, 2), (17, 17), (18, 3), (19, 19), (20, 5)'
-
-
-def _q727_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"nn AS (SELECT DISTINCT CAST(doc_id % 20 + 1 AS"
-        f" BIGINT) AS n FROM {tbl})",
-        "ph AS (SELECT CAST(n AS BIGINT) AS n, CAST(v AS"
-        " BIGINT) AS v\n"
-        "         FROM (VALUES {phi}) t(n, v))",
-        "mb AS (SELECT CAST(n AS BIGINT) AS n, CAST(mu AS"
-        " BIGINT) AS mu\n"
-        "         FROM (VALUES {mob}) t(n, mu))",
-        "lp AS (SELECT CAST(n AS BIGINT) AS n, CAST(p AS"
-        " BIGINT) AS p\n"
-        "         FROM (VALUES {lpf}) t(n, p))",
-        # Mobius-product certificate for each inlined Phi_n(2):
-        # prod over d | n with mu(n/d) = +1 of (2^d - 1) equals
-        # Phi_n(2) times the mu = -1 product, exactly
-        "mv AS (SELECT CAST(sum(CASE WHEN t.pnum <> f.v *"
-        " t.pden\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS phi_viol"
-        " FROM (\n"
-        "           SELECT a.n,\n"
-        "             CAST(floor(exp(sum(CASE WHEN m.mu = 1 THEN\n"
-        "               ln(CAST(CASE b.n WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 WHEN 7 THEN 128 WHEN 8 THEN 256 WHEN 9 THEN 512 WHEN 10 THEN 1024 WHEN 11 THEN 2048 WHEN 12 THEN 4096 WHEN 13 THEN 8192 WHEN 14 THEN 16384 WHEN 15 THEN 32768 WHEN 16 THEN 65536 WHEN 17 THEN 131072 WHEN 18 THEN 262144 WHEN 19 THEN 524288 WHEN 20 THEN 1048576 END - 1 AS DOUBLE)) ELSE"
-        " 0 END))\n"
-        "               + 0.5) AS BIGINT) AS pnum,\n"
-        "             CAST(floor(exp(sum(CASE WHEN m.mu = -1 THEN\n"
-        "               ln(CAST(CASE b.n WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 WHEN 7 THEN 128 WHEN 8 THEN 256 WHEN 9 THEN 512 WHEN 10 THEN 1024 WHEN 11 THEN 2048 WHEN 12 THEN 4096 WHEN 13 THEN 8192 WHEN 14 THEN 16384 WHEN 15 THEN 32768 WHEN 16 THEN 65536 WHEN 17 THEN 131072 WHEN 18 THEN 262144 WHEN 19 THEN 524288 WHEN 20 THEN 1048576 END - 1 AS DOUBLE)) ELSE"
-        " 0 END))\n"
-        "               + 0.5) AS BIGINT) AS pden\n"
-        "           FROM nn a JOIN nn b ON a.n % b.n = 0\n"
-        "           JOIN mb m ON m.n = a.n {d} b.n\n"
-        "           GROUP BY a.n) t\n"
-        "         JOIN ph f ON f.n = t.n)",
-        # the cyclotomic factorization: prod over d | n of
-        # Phi_d(2) = 2^n - 1, at EVERY n, in exact integers
-        "pv AS (SELECT CAST(sum(CASE WHEN t.pr <> t.mersenne\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " prod_viol FROM (\n"
-        "           SELECT a.n,\n"
-        "             CAST(floor(exp(sum(ln(CAST(f.v AS DOUBLE)))) +"
-        " 0.5\n"
-        "               ) AS BIGINT) AS pr,\n"
-        "             max(CASE a.n WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64 WHEN 7 THEN 128 WHEN 8 THEN 256 WHEN 9 THEN 512 WHEN 10 THEN 1024 WHEN 11 THEN 2048 WHEN 12 THEN 4096 WHEN 13 THEN 8192 WHEN 14 THEN 16384 WHEN 15 THEN 32768 WHEN 16 THEN 65536 WHEN 17 THEN 131072 WHEN 18 THEN 262144 WHEN 19 THEN 524288 WHEN 20 THEN 1048576 END) - 1 AS mersenne\n"
-        "           FROM nn a JOIN nn b ON a.n % b.n = 0\n"
-        "           JOIN ph f ON f.n = b.n\n"
-        "           GROUP BY a.n) t)",
-        # Bang: strip the at-most-one factor of n's largest
-        # prime from Phi_n(2); a primitive prime divisor exists
-        # iff what remains exceeds 1 — the exception is n = 6
-        "bv AS{mat} (SELECT f.n, f.v,\n"
-        "           CASE WHEN f.v % l.p = 0 THEN f.v {d} l.p\n"
-        "             ELSE f.v END AS strip\n"
-        "         FROM ph f JOIN lp l ON l.n = f.n)",
-        "bc AS (SELECT\n"
-        "           CAST(sum(CASE WHEN (CASE WHEN strip > 1"
-        " THEN 1\n"
-        "             ELSE 0 END) <> (CASE WHEN n <> 6 THEN 1\n"
-        "             ELSE 0 END) THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "             AS bang_viol,\n"
-        "           CAST(sum(CASE WHEN strip > 1 THEN 0 ELSE 1"
-        " END)\n"
-        "             AS BIGINT) AS n_exceptions\n"
-        "         FROM bv)",
-        # double-strip sanity: the lemma says the intrinsic
-        # factor divides at most ONCE
-        "dsv AS (SELECT CAST(sum(CASE WHEN strip % l.p = 0"
-        " AND\n"
-        "           v % l.p = 0 THEN 1 ELSE 0 END) AS BIGINT)\n"
-        "           AS double_viol\n"
-        "         FROM bv JOIN lp l ON l.n = bv.n)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT b.n, b.v AS phi2, b.strip,\n"
-        "       CASE WHEN b.strip > 1 THEN 1 ELSE 0 END AS"
-        " has_primitive,\n"
-        "       m.phi_viol, p.prod_viol, c.bang_viol,\n"
-        "       c.n_exceptions, w.double_viol, l.n_docs\n"
-        "FROM bv b CROSS JOIN mv m CROSS JOIN pv p\n"
-        "CROSS JOIN bc c CROSS JOIN dsv w CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q727_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q727_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{phi}", _Q727_PHI)
-             .replace("{mob}", _Q727_MOB)
-             .replace("{lpf}", _Q727_LPF))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q727_bang_zsygmondy",
-       "WITH " + _q727_join("documents", "//", " MATERIALIZED"))
-def q727(spark, sf_dir):
-    """Bang's theorem through cyclotomic values — every 2^n - 1
-    has a prime divisor dividing no earlier 2^m - 1, except
-    exactly n = 6 (Bang 1886, Zsygmondy 1892 in general; the
-    existence of primitive prime divisors powers finite-field
-    constructions, the classification of group orders, and
-    q689's m-sequence periods).  The inlined cyclotomic values
-    Phi_n(2) are re-certified by TWO exact identities: the
-    Mobius product — the mu = +1 product of (2^d - 1) over
-    divisors equals Phi_n(2) times the mu = -1 product
-    (phi_viol == 0) — and the full cyclotomic factorization
-    prod_{d | n} Phi_d(2) = 2^n - 1 at every n <= 20
-    (prod_viol == 0), Mersenne numbers rebuilt from their
-    cyclotomic atoms including the primes 8191, 131071, 524287
-    at n = 13, 17, 19.  Bang then reduces to arithmetic: the
-    only possible non-primitive prime in Phi_n(2) is n's
-    largest prime factor, dividing AT MOST ONCE (double_viol
-    == 0, the lemma checked); stripping it, a primitive prime
-    exists iff the remainder exceeds 1 — and that happens for
-    every n in 2..20 EXCEPT n = 6 (bang_viol == 0,
-    n_exceptions == 1: Phi_6(2) = 3 strips to 1, the whole
-    famous exception, isolated by division).  Scale: divisor-
-    pair joins over a 20-row dim; the certificate is a handful
-    of exact integer products."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q727_documents")
-    parts, fin = _q727_sql("q727_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q727_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{phi}", _Q727_PHI)
-              .replace("{mob}", _Q727_MOB)
-              .replace("{lpf}", _Q727_LPF))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("nn", "ph", "mb", "lp", "bv"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q727_{nm}",
-                      max_rows=100)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q728: the primitive Pythagorean triple tree — Berggren's
-# three matrices vs Euclid's parametrization, a true bijection
-
-
-def _q728_sql(tbl: str, d: str, mat: str):
-    arms = [['(1)*a + (-2)*b + (2)*c', '(2)*a + (-1)*b + (2)*c', '(2)*a + (-2)*b + (3)*c'], ['(1)*a + (2)*b + (2)*c', '(2)*a + (1)*b + (2)*c', '(2)*a + (2)*b + (3)*c'], ['(-1)*a + (2)*b + (2)*c', '(-2)*a + (1)*b + (2)*c', '(-2)*a + (2)*b + (3)*c']]
-    parts = [
-        f"md AS (SELECT DISTINCT CAST(doc_id % 13 + 2 AS"
-        f" BIGINT) AS m FROM {tbl})",
-        f"nd2 AS (SELECT DISTINCT CAST(doc_id % 13 + 1 AS"
-        f" BIGINT) AS n FROM {tbl})",
-        f"gd AS (SELECT DISTINCT CAST(doc_id % 13 + 2 AS"
-        f" BIGINT) AS g FROM {tbl})",
-        # Euclid's parametrization: coprime opposite-parity m > n
-        "pz AS{mat} (SELECT t.m, t.n, t.m*t.m - t.n*t.n AS"
-        " a,\n"
-        "           2*t.m*t.n AS b, t.m*t.m + t.n*t.n AS c\n"
-        "         FROM (SELECT m.m, n.n FROM md m JOIN nd2 n\n"
-        "           ON n.n < m.m AND (m.m - n.n) % 2 = 1) t\n"
-        "         LEFT JOIN gd g ON t.m % g.g = 0 AND\n"
-        "           t.n % g.g = 0\n"
-        "         GROUP BY t.m, t.n HAVING count(g.g) = 0)",
-        "pm AS{mat} (SELECT least(a, b) AS lo, greatest(a, b)"
-        " AS hi, c\n"
-        "         FROM pz WHERE c <= 200)",
-        # the Pythagorean identity certified on the generator
-        "piv AS (SELECT CAST(sum(CASE WHEN a*a + b*b <> c*c\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " pyth_viol FROM pz)",
-        # Berggren tree from (3, 4, 5), nine unrolled levels
-        "t0 AS (SELECT CAST(3 AS BIGINT) AS a, CAST(4 AS"
-        " BIGINT) AS b,\n"
-        "           CAST(5 AS BIGINT) AS c)",
-    ]
-    for k in range(1, 10):
-        sel = "\n         UNION ALL ".join(
-            "SELECT CAST({0} AS BIGINT) AS a, CAST({1} AS"
-            " BIGINT) AS b, CAST({2} AS BIGINT) AS c FROM"
-            " t{3}".format(r[0], r[1], r[2], k - 1)
-            for r in arms)
-        parts.append(
-            f"t{k} AS{{mat}} (SELECT a, b, c FROM (\n"
-            f"         {sel}) u WHERE c <= 200)")
-    parts += [
-        "tu AS{mat} (" + "\n         UNION ALL ".join(
-            f"SELECT least(a, b) AS lo, greatest(a, b) AS hi,"
-            f" c FROM t{k}" for k in range(9)) + ")",
-        # fixpoint: level 8 is already empty in range
-        "fx AS (SELECT CAST(count(*) AS BIGINT) AS lvl9\n"
-        "         FROM t9)",
-        # bijection: tree = parametrization, both containments,
-        # and every tree triple generated EXACTLY once
-        "bj AS (SELECT CAST(\n"
-        "           (SELECT count(*) FROM tu u LEFT JOIN pm p\n"
-        "             ON p.lo = u.lo AND p.hi = u.hi AND"
-        " p.c = u.c\n"
-        "             WHERE p.c IS NULL)\n"
-        "           + (SELECT count(*) FROM pm p LEFT JOIN tu"
-        " u\n"
-        "             ON u.lo = p.lo AND u.hi = p.hi AND\n"
-        "               u.c = p.c WHERE u.c IS NULL)\n"
-        "           AS BIGINT) AS iff_viol,\n"
-        "           (SELECT CAST(sum(CASE WHEN t.k <> 1 THEN"
-        " 1\n"
-        "             ELSE 0 END) AS BIGINT) FROM (SELECT lo,"
-        " hi, c,\n"
-        "             count(*) AS k FROM tu GROUP BY lo, hi,"
-        " c) t)\n"
-        "             AS mult_viol,\n"
-        "           (SELECT CAST(count(*) AS BIGINT) FROM pm)\n"
-        "             AS n_triples)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT p.lo, p.hi, p.c,\n"
-        "       b.iff_viol, b.mult_viol, b.n_triples,\n"
-        "       v.pyth_viol, f.lvl9, l.n_docs\n"
-        "FROM pm p CROSS JOIN bj b CROSS JOIN piv v\n"
-        "CROSS JOIN fx f CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q728_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q728_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q728_pythagorean_tree",
-       "WITH " + _q728_join("documents", "//", " MATERIALIZED"))
-def q728(spark, sf_dir):
-    """The primitive Pythagorean triple tree — Berggren's three
-    matrices generate every primitive triple from (3,4,5)
-    EXACTLY ONCE, verified against Euclid's parametrization by
-    total agreement in range (Euclid's Elements X.29 for the
-    m, n form; Berggren 1934 for the ternary tree — the
-    structure that makes 'enumerate primitive triples' a
-    traversal, cousin to q679's Markov tree but with UNIQUE
-    generation, a true tree rather than a reachability graph).
-    Machine one: all coprime opposite-parity pairs m > n (gcd
-    by divisor sweep) yield (m^2 - n^2, 2mn, m^2 + n^2) with
-    the Pythagorean identity certified on every generated row
-    — exactly 32 primitive triples with hypotenuse <= 200.
-    Machine two: nine unrolled levels of the three Berggren
-    matrix arms from (3,4,5), pruned at c <= 200, with level 9
-    certified ALREADY EMPTY (lvl9 == 0 — the unroll provably
-    saturated; the depth-8 leaf (19,180,181) is the deepest).  The weld is a bijection, not mere agreement:
-    tree = parametrization in both containments (iff_viol ==
-    0) AND every tree triple is produced exactly once across
-    all levels (mult_viol == 0) — unique generation is what
-    distinguishes Berggren's theorem from mere surjectivity,
-    and it is counted, not cited.  Scale: dim sweeps and a
-    9-level frontier union; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q728_documents")
-    parts, fin = _q728_sql("q728_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q728_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("md", "nd2", "gd", "pz", "pm", "tu") or \
-                (nm[0] == "t" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q728_{nm}",
-                      max_rows=500)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q729: the continued fraction of e — Euler's 1,1,2k pattern
-# extracted by exact Euclid from the factorial series
-
-
-_Q729_FAC = '(0, 2432902008176640000), (1, 2432902008176640000), (2, 1216451004088320000), (3, 405483668029440000), (4, 101370917007360000), (5, 20274183401472000), (6, 3379030566912000), (7, 482718652416000), (8, 60339831552000), (9, 6704425728000), (10, 670442572800), (11, 60949324800), (12, 5079110400), (13, 390700800), (14, 27907200), (15, 1860480), (16, 116280), (17, 6840), (18, 380), (19, 20), (20, 1)'
-_Q729_EXP = '(0, 2), (1, 1), (2, 2), (3, 1), (4, 1), (5, 4), (6, 1), (7, 1), (8, 6), (9, 1), (10, 1), (11, 8), (12, 1), (13, 1), (14, 10), (15, 1), (16, 1), (17, 12)'
-
-
-def _q729_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "fc AS (SELECT CAST(k AS BIGINT) AS k, CAST(v AS"
-        " BIGINT) AS v\n"
-        "         FROM (VALUES {fac}) t(k, v))",
-        "xp AS (SELECT CAST(j AS BIGINT) AS j, CAST(q AS"
-        " BIGINT) AS q\n"
-        "         FROM (VALUES {exp}) t(j, q))",
-        # the approximant: num = sum 20!/k!, den = 20!; the
-        # term table re-certified by its downward recurrence
-        "rc AS (SELECT CAST(sum(CASE WHEN a.v <> (a.k + 1)*b.v\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " fact_viol\n"
-        "         FROM fc a JOIN fc b ON b.k = a.k + 1)",
-        "ap AS (SELECT CAST(sum(v) AS BIGINT) AS num,\n"
-        "           CAST(max(CASE WHEN k = 0 THEN v END) AS"
-        " BIGINT)\n"
-        "             AS den FROM fc)",
-        "e0 AS (SELECT CAST(0 AS BIGINT) AS j, num AS a,"
-        " den AS b,\n"
-        "           CAST(0 AS BIGINT) AS ev FROM ap)",
-    ]
-    for s in range(1, 19):
-        parts.append(
-            f"e{s} AS{{mat}} (SELECT CAST({s} AS BIGINT) AS"
-            f" j,\n"
-            f"           b AS a, a % b AS b,\n"
-            f"           a {{d}} b AS ev FROM e{s - 1}\n"
-            f"         WHERE b > 0)")
-    parts += [
-        "cf AS{mat} (" + "\n         UNION ALL ".join(
-            f"SELECT j, ev, a, b FROM e{s}"
-            for s in range(1, 19)) + ")",
-        # Euclid validity at every stage: 0 <= r < b, and the
-        # division identity (products bounded by the dividend)
-        "ev2 AS (SELECT CAST(sum(CASE WHEN c.b < 0 OR c.b >="
-        " c.a\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " euclid_viol\n"
-        "         FROM cf c)",
-        # Euler's pattern: quotients 2, then (1, 2k, 1) blocks
-        "pt AS (SELECT CAST(sum(CASE WHEN c.ev <> x.q THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS pattern_viol\n"
-        "         FROM cf c JOIN xp x ON x.j = c.j - 1)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT c.j, c.ev AS quotient, x.q AS expected,\n"
-        "       r.fact_viol, v.euclid_viol, p2.pattern_viol,\n"
-        "       l.n_docs\n"
-        "FROM cf c JOIN xp x ON x.j = c.j - 1\n"
-        "CROSS JOIN rc r CROSS JOIN ev2 v CROSS JOIN pt p2\n"
-        "CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q729_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q729_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{fac}", _Q729_FAC)
-             .replace("{exp}", _Q729_EXP))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q729_e_continued_fraction",
-       "WITH " + _q729_join("documents", "//", " MATERIALIZED"))
-def q729(spark, sf_dir):
-    """The continued fraction of e — Euler's astonishing
-    pattern 2; 1, 2, 1, 1, 4, 1, 1, 6, 1, ... extracted by
-    exact integer Euclid from the factorial series (Euler
-    1737; e's regular continued fraction is one of the few
-    'natural' constants with a closed-form quotient pattern,
-    and the 1, 2k, 1 blocks are the fingerprint of its
-    irrationality — the pattern never terminates, so e is
-    irrational, Euler's own proof).  The approximant is sum of
-    20!/k! over 20! — a 19-digit exact integer pair whose term
-    table is re-certified by the downward recurrence 20!/k! =
-    (k+1) * 20!/(k+1)! (fact_viol == 0).  Eighteen unrolled
-    Euclid stages extract quotients by pure integer div/mod
-    (every stage certified: remainder strictly below the
-    divisor, euclid_viol == 0 — and since q*b <= a, every
-    product stays inside BIGINT by construction), and the
-    emitted quotients match Euler's pattern EXACTLY for all 18
-    terms: 2, then (1, 2k, 1) for k = 1..5 and beyond
-    (pattern_viol == 0) — the factorial series' truncation
-    shares e's continued fraction this deep because its error
-    is far below the 18th convergent's resolution.  Scale: a
-    single-row 18-stage Euclid chain plus a 21-row dim; the
-    heaviest number in the plan is 6613313319248080001."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q729_documents")
-    parts, fin = _q729_sql("q729_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q729_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{fac}", _Q729_FAC)
-              .replace("{exp}", _Q729_EXP))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("fc", "xp", "ap", "cf") or \
-                (nm[0] == "e" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q729_{nm}",
-                      max_rows=100)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q730: Pratt certificates — primality is in NP, the witness
-# tree for 997 checked relationally, node by node
-
-
-_Q730_NODES = '(3, 2), (5, 2), (41, 6), (83, 2), (997, 7)'
-_Q730_FEDGE = '(997, 2, 2), (997, 3, 1), (997, 83, 1), (83, 2, 1), (83, 41, 1), (41, 2, 3), (41, 5, 1), (5, 2, 2), (3, 2, 1)'
-_Q730_CASES = '(3, 2, 2, 1), (3, 2, 1, 0), (5, 2, 4, 1), (5, 2, 2, 0), (41, 6, 40, 1), (41, 6, 20, 0), (41, 6, 8, 0), (83, 2, 82, 1), (83, 2, 41, 0), (83, 2, 2, 0), (997, 7, 996, 1), (997, 7, 498, 0), (997, 7, 332, 0), (997, 7, 12, 0)'
-
-
-def _q730_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"dv AS (SELECT DISTINCT CAST(doc_id % 31 + 2 AS"
-        f" BIGINT) AS q FROM {tbl})",
-        "nd AS (SELECT CAST(p AS BIGINT) AS p, CAST(g AS"
-        " BIGINT) AS g\n"
-        "         FROM (VALUES {nodes}) t(p, g))",
-        "fe AS (SELECT CAST(p AS BIGINT) AS p, CAST(q AS"
-        " BIGINT) AS q,\n"
-        "           CAST(m AS BIGINT) AS m FROM (VALUES"
-        " {fedge}) t(p, q, m))",
-        "cs AS (SELECT CAST(p AS BIGINT) AS p, CAST(g AS"
-        " BIGINT) AS g,\n"
-        "           CAST(e AS BIGINT) AS e, CAST(x AS BIGINT)"
-        " AS x\n"
-        "         FROM (VALUES {cases}) t(p, g, e, x))",
-        # the factor edges really factor p - 1 (multiplicities
-        # via an exact small product)
-        "fv AS (SELECT CAST(sum(CASE WHEN t.pr <> t.p - 1"
-        " THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS fact_viol FROM"
-        " (\n"
-        "           SELECT f.p, CAST(floor(exp(sum(f.m *\n"
-        "             ln(CAST(f.q AS DOUBLE)))) + 0.5) AS"
-        " BIGINT) AS pr\n"
-        "           FROM fe f GROUP BY f.p) t)",
-        # every factor-edge target is itself certified (a node
-        # or the base prime 2) — the tree is CLOSED
-        "cv AS (SELECT CAST(sum(CASE WHEN f.q <> 2 AND\n"
-        "           n.p IS NULL THEN 1 ELSE 0 END) AS BIGINT)\n"
-        "           AS closure_viol\n"
-        "         FROM fe f LEFT JOIN nd n ON n.p = f.q)",
-        "m0 AS (SELECT p, g, e, x, CAST(1 AS BIGINT) AS acc\n"
-        "         FROM cs)",
-    ]
-    for s, i in enumerate(range(9, -1, -1)):
-        parts.append(
-            f"m{s + 1} AS{{mat}} (SELECT p, g, e, x,\n"
-            f"           CAST((((acc*acc) % p) * (CASE WHEN"
-            f" (e {{d}} {2 ** i}) % 2 = 1\n"
-            f"             THEN g ELSE 1 END)) % p AS BIGINT)"
-            f" AS acc\n"
-            f"         FROM m{s})")
-    parts += [
-        # Lucas conditions: g^(p-1) = 1, g^((p-1)/q) <> 1
-        "lv AS (SELECT CAST(sum(CASE WHEN (x = 1 AND acc <>"
-        " 1)\n"
-        "           OR (x = 0 AND acc = 1) THEN 1 ELSE 0 END)\n"
-        "           AS BIGINT) AS lucas_viol FROM m10)",
-        # independent cross-check: 997 is prime by trial division
-        "tv AS (SELECT CAST(sum(CASE WHEN 997 % q.q = 0 THEN 1\n"
-        "           ELSE 0 END) AS BIGINT) AS trial_viol\n"
-        "         FROM dv q WHERE q.q*q.q <= 997)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT c.p, c.g, c.e, c.x, m.acc,\n"
-        "       f.fact_viol, v.closure_viol, u.lucas_viol,\n"
-        "       t.trial_viol, l.n_docs\n"
-        "FROM cs c JOIN m10 m ON m.p = c.p AND m.e = c.e\n"
-        "CROSS JOIN fv f CROSS JOIN cv v CROSS JOIN lv u\n"
-        "CROSS JOIN tv t CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q730_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q730_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{nodes}", _Q730_NODES)
-             .replace("{fedge}", _Q730_FEDGE)
-             .replace("{cases}", _Q730_CASES))
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q730_pratt_certificate",
-       "WITH " + _q730_join("documents", "//", " MATERIALIZED"))
-def q730(spark, sf_dir):
-    """Pratt certificates — PRIMES is in NP, demonstrated by
-    checking the full witness tree for 997 relationally (Pratt
-    1975; a prime's certificate is a generator of its
-    multiplicative group plus, recursively, certificates for
-    the prime factors of p - 1 — polynomial-size, polynomial-
-    time checkable, and decades before AKS the cleanest proof
-    that primality has short proofs).  The inlined tree —
-    997 (g = 7), 83 (g = 2), 41 (g = 6), 5, 3, with 2 as the
-    base case — is checked on all three certificate axioms:
-    the factor edges exactly rebuild p - 1 with multiplicities
-    (fact_viol == 0), every factor appearing anywhere is
-    itself a certified node or 2 (closure_viol == 0 — the tree
-    is closed, no unproven primes smuggled in), and the Lucas
-    conditions hold at every node: g^(p-1) = 1 mod p while
-    g^((p-1)/q) <> 1 for every prime factor q — fourteen
-    modular exponentiations, all run through ten shared
-    square-and-multiply stages (lucas_viol == 0).  Those
-    conditions force g's order to be exactly p - 1, so the
-    group has p - 1 elements and p is prime — the classical
-    Lucas test, here with its recursive hypotheses DISCHARGED
-    rather than assumed, and an independent trial-division
-    cross-check on the root agreeing (trial_viol == 0).
-    Scale: a 14-row modexp sweep; certificate checking is as
-    cheap as Pratt promised."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q730_documents")
-    parts, fin = _q730_sql("q730_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q730_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{nodes}", _Q730_NODES)
-              .replace("{fedge}", _Q730_FEDGE)
-              .replace("{cases}", _Q730_CASES))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("dv", "nd", "fe", "cs") or \
-                (nm[0] == "m" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q730_{nm}",
-                      max_rows=100)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q731: quadratic Gauss sums in finite fields — g^2 = chi(-1) p
-# certified exactly, sign and all
-
-
-_Q731_GI = '(17, 103, 8), (13, 53, 10), (11, 23, 2)'
-
-
-def _q731_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"td AS (SELECT DISTINCT CAST(doc_id % 17 AS BIGINT)"
-        f" AS t FROM {tbl})",
-        "gi AS (SELECT CAST(p AS BIGINT) AS p, CAST(q AS"
-        " BIGINT) AS q,\n"
-        "           CAST(w AS BIGINT) AS w FROM (VALUES {gi})"
-        " t(p, q, w))",
-        # power table omega^k mod q by 16 chained products
-        "w0 AS (SELECT p, q, w, CAST(0 AS BIGINT) AS k,\n"
-        "           CAST(1 AS BIGINT) AS v FROM gi)",
-    ]
-    for k in range(1, 17):
-        parts.append(
-            f"w{k} AS{{mat}} (SELECT p, q, w, CAST({k} AS"
-            f" BIGINT) AS k,\n"
-            f"           (v*w) % q AS v FROM w{k - 1})")
-    parts += [
-        "pw AS{mat} (" + "\n         UNION ALL ".join(
-            f"SELECT p, q, k, v FROM w{k}" for k in range(17))
-        + ")",
-        # omega has order exactly p: v_p = 1, no earlier return
-        "ov AS (SELECT CAST(sum(CASE WHEN (k = p AND v <> 1)\n"
-        "           OR (k >= 1 AND k < p AND v = 1) THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS ord_viol FROM pw\n"
-        "         WHERE k <= p)",
-        # Legendre character from the square census mod p
-        "qr AS{mat} (SELECT g.p, t.t AS r FROM gi g JOIN td"
-        " t\n"
-        "         ON t.t >= 1 AND t.t < g.p\n"
-        "         GROUP BY g.p, t.t\n"
-        "         HAVING sum(CASE WHEN (t.t*t.t) % g.p = 0"
-        " THEN 1\n"
-        "           ELSE 0 END) >= 0)",
-        "ch AS{mat} (SELECT g.p, u.t,\n"
-        "           CASE WHEN sq.r IS NOT NULL THEN 1 ELSE -1"
-        " END AS c\n"
-        "         FROM gi g JOIN td u ON u.t >= 1 AND"
-        " u.t < g.p\n"
-        "         LEFT JOIN (SELECT DISTINCT g2.p,\n"
-        "             (s.t*s.t) % g2.p AS r FROM gi g2\n"
-        "           JOIN td s ON s.t >= 1 AND s.t < g2.p) sq\n"
-        "           ON sq.p = g.p AND sq.r = u.t)",
-        # the character is multiplicative and balanced
-        "cm AS (SELECT\n"
-        "           CAST(sum(CASE WHEN a.c*b.c <> x.c THEN 1\n"
-        "             ELSE 0 END) AS BIGINT) AS mult_viol\n"
-        "         FROM ch a JOIN ch b ON b.p = a.p\n"
-        "         JOIN ch x ON x.p = a.p AND x.t =\n"
-        "           (a.t*b.t) % a.p)",
-        "cb AS (SELECT CAST(sum(c) AS BIGINT) AS char_sum\n"
-        "         FROM ch)",
-        # the Gauss sum and its squared value, exactly
-        "gs AS{mat} (SELECT g.p, g.q,\n"
-        "           CAST(((sum(c.c * w.v) % g.q) + g.q) % g.q"
-        " AS BIGINT)\n"
-        "             AS gsum\n"
-        "         FROM gi g JOIN ch c ON c.p = g.p\n"
-        "         JOIN pw w ON w.p = g.p AND w.k = c.t\n"
-        "         GROUP BY g.p, g.q)",
-        "gv AS (SELECT CAST(sum(CASE WHEN (s.gsum*s.gsum) %"
-        " s.q <>\n"
-        "           (CASE WHEN (s.p - 1) {d} 2 % 2 = 0 THEN"
-        " s.p % s.q\n"
-        "             ELSE (s.q - s.p % s.q) % s.q END)\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " gauss_viol\n"
-        "         FROM gs s)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT s.p, s.q, s.gsum,\n"
-        "       (s.gsum*s.gsum) % s.q AS gsq,\n"
-        "       CASE WHEN (s.p - 1) {d} 2 % 2 = 0 THEN 1 ELSE"
-        " -1 END\n"
-        "         AS sign_chi,\n"
-        "       o.ord_viol, m.mult_viol, b.char_sum,\n"
-        "       v.gauss_viol, l.n_docs\n"
-        "FROM gs s CROSS JOIN ov o CROSS JOIN cm m\n"
-        "CROSS JOIN cb b CROSS JOIN gv v CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q731_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q731_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = (p.replace("{mat}", mat).replace("{d}", d)
-             .replace("{gi}", _Q731_GI))
-        out.append(p)
-    return (",\n       ".join(out) + "\n"
-            + fin.replace("{d}", d))
-
-
-@query("q731_gauss_sums",
-       "WITH " + _q731_join("documents", "//", " MATERIALIZED"))
-def q731(spark, sf_dir):
-    """Quadratic Gauss sums evaluated in finite fields — the
-    identity g^2 = chi(-1) p certified exactly, sign and all,
-    with no complex numbers anywhere (Gauss 1801/1811; the sum
-    sum chi(t) zeta^t is the bridge between additive and
-    multiplicative structure, powering quadratic reciprocity
-    proofs — q608's theorem has THIS engine underneath — and
-    its SIGN famously took Gauss four years).  Three
-    instances: p = 17 in GF(103), p = 13 in GF(53), p = 11 in
-    GF(23) — each auxiliary field chosen with q = 1 mod p so a
-    genuine p-th root of unity omega exists; omega's order is
-    certified EXACTLY p by a 16-step power table (ord_viol ==
-    0).  The Legendre character comes from the square census
-    mod p and is certified multiplicative over all pairs
-    (mult_viol == 0) and balanced (char_sum == 0 — as many
-    residues as non-residues).  The Gauss sum then evaluates
-    by one grouped join of character against root-power, and
-    the celebrated identity lands exactly: g^2 = +p mod q for
-    p = 13, 17 (p = 1 mod 4) and g^2 = -p mod q for p = 11
-    (p = 3 mod 4) — gauss_viol == 0, the chi(-1) sign rule
-    computed, not quoted.  Scale: 17-stage power chains over
-    3-row dims and one grouped join; exact end to end."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q731_documents")
-    parts, fin = _q731_sql("q731_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q731_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = (fr.replace("{mat}", "").replace("{d}", "div")
-              .replace("{gi}", _Q731_GI))
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("td", "gi", "pw", "qr", "ch", "gs") or \
-                (nm[0] == "w" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q731_{nm}",
-                      max_rows=200)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin).replace("{d}", "div"))
-
-
-# ---------------------------------------------------------------------------
-# q732: the Chinese Remainder Theorem as a ring isomorphism —
-# Z/105 = Z/3 x Z/5 x Z/7, bijection and both operations
-
-
-def _q732_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"zn AS (SELECT DISTINCT CAST(doc_id % 105 AS BIGINT)"
-        f" AS x FROM {tbl})",
-        # the residue map and Garner's mixed-radix inverse:
-        # x = r3 + 3 t1 + 15 t2 with t1 = 2(r5 - r3) mod 5,
-        # t2 = (r7 - r3 - 3 t1) mod 7 (inv(3,5) = 2,
-        # inv(15,7) = 1 — the precomputed Garner constants)
-        "mp AS{mat} (SELECT x, x % 3 AS r3, x % 5 AS r5,\n"
-        "           x % 7 AS r7 FROM zn)",
-        "gr AS{mat} (SELECT m.*,\n"
-        "           m.r3 + 3*((2*(m.r5 - m.r3) % 5 + 5) % 5)\n"
-        "           + 15*((((m.r7 - m.r3 - 3*((2*(m.r5 - m.r3)"
-        " % 5\n"
-        "             + 5) % 5)) % 7) + 7) % 7) AS xrec\n"
-        "         FROM mp m)",
-        # Garner reconstructs every element: the map is injective
-        # hence bijective (counting), explicitly inverted
-        "gv AS (SELECT CAST(sum(CASE WHEN xrec <> x THEN 1"
-        " ELSE 0 END)\n"
-        "           AS BIGINT) AS garner_viol,\n"
-        "           CAST(count(DISTINCT r3*35 + r5*7 + r7) AS"
-        " BIGINT)\n"
-        "             AS n_images\n"
-        "         FROM gr)",
-        # ring homomorphism: addition and multiplication commute
-        # with the residue map, over ALL 11025 pairs
-        "hv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN ((a.x + b.x) % 105) % 3"
-        " <>\n"
-        "             (a.r3 + b.r3) % 3 OR ((a.x + b.x) % 105)"
-        " % 5 <>\n"
-        "             (a.r5 + b.r5) % 5 OR ((a.x + b.x) % 105)"
-        " % 7 <>\n"
-        "             (a.r7 + b.r7) % 7 THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "             AS add_viol,\n"
-        "           CAST(sum(CASE WHEN ((a.x * b.x) % 105) % 3"
-        " <>\n"
-        "             (a.r3 * b.r3) % 3 OR ((a.x * b.x) % 105)"
-        " % 5 <>\n"
-        "             (a.r5 * b.r5) % 5 OR ((a.x * b.x) % 105)"
-        " % 7 <>\n"
-        "             (a.r7 * b.r7) % 7 THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "             AS mul_viol\n"
-        "         FROM mp a CROSS JOIN mp b)",
-        # unit-group factorization: phi(105) = phi(3) phi(5)
-        # phi(7) — units are exactly the componentwise units
-        "uv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN (CASE WHEN r3 <> 0 AND\n"
-        "             r5 <> 0 AND r7 <> 0 THEN 1 ELSE 0 END)"
-        " <>\n"
-        "             t.u THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " unit_viol,\n"
-        "           CAST(sum(t.u) AS BIGINT) AS n_units\n"
-        "         FROM mp JOIN (SELECT z.x, CASE WHEN"
-        " count(w.x) > 0\n"
-        "             THEN 1 ELSE 0 END AS u FROM zn z\n"
-        "           LEFT JOIN zn w ON (z.x * w.x) % 105 = 1\n"
-        "           GROUP BY z.x) t ON t.x = mp.x)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT g.x, g.r3, g.r5, g.r7, g.xrec,\n"
-        "       v.garner_viol, v.n_images, h.add_viol,\n"
-        "       h.mul_viol, u.unit_viol, u.n_units, l.n_docs\n"
-        "FROM gr g CROSS JOIN gv v CROSS JOIN hv h\n"
-        "CROSS JOIN uv u CROSS JOIN ld l\n"
-        "WHERE g.x < 12 OR g.x > 99")
-    return parts, fin
-
-
-def _q732_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q732_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q732_chinese_remainder",
-       "WITH " + _q732_join("documents", "//", " MATERIALIZED"))
-def q732(spark, sf_dir):
-    """The Chinese Remainder Theorem as a certified ring
-    isomorphism — Z/105 = Z/3 x Z/5 x Z/7 with the bijection
-    EXPLICITLY inverted and both operations checked over every
-    pair (Sunzi c. 400 CE, ring form by Gauss; CRT underlies
-    RSA-CRT decryption, q688's NTT modulus splitting, and
-    every multi-modular big-integer algorithm).  All 105
-    elements map to residue triples; Garner's mixed-radix
-    reconstruction — x = r3 + 3 t1 + 15 t2 with the
-    precomputed inverse constants inv(3) = 2 mod 5 and
-    inv(15) = 1 mod 7 — recovers EVERY element exactly
-    (garner_viol == 0), and the image has all 105 distinct
-    triples (n_images == 105): bijectivity by explicit inverse
-    plus counting.  The map is a RING homomorphism, not just a
-    bijection: addition and multiplication commute with it
-    componentwise over all 11025 ordered pairs (add_viol ==
-    mul_viol == 0).  The unit groups factor too: an element is
-    invertible mod 105 (checked by exhaustive inverse search)
-    exactly when all three components are nonzero (unit_viol
-    == 0), and n_units == 48 = phi(3) phi(5) phi(7) — Euler's
-    multiplicativity as a data consequence of the
-    isomorphism.  Scale: one 11k-pair certificate join; fixed
-    cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q732_documents")
-    parts, fin = _q732_sql("q732_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q732_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("zn", "mp", "gr"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q732_{nm}",
-                      max_rows=200)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q733: square roots mod p — the (p+1)/4 shortcut exact for
-# p = 3 mod 4, and its near-total failure on the other half
-
-
-def _q733_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"pp AS (SELECT DISTINCT CAST(doc_id % 97 + 3 AS"
-        f" BIGINT) AS p FROM {tbl})",
-        f"dv AS (SELECT DISTINCT CAST(doc_id % 9 + 2 AS"
-        f" BIGINT) AS q FROM {tbl})",
-        f"tt AS (SELECT DISTINCT CAST(doc_id % 99 + 1 AS"
-        f" BIGINT) AS t FROM {tbl})",
-        "pr AS{mat} (SELECT t.p FROM (\n"
-        "           SELECT p.p, sum(CASE WHEN q.q < p.p AND\n"
-        "             q.q*q.q <= p.p AND p.p % q.q = 0 THEN 1\n"
-        "             ELSE 0 END) AS nf\n"
-        "           FROM pp p CROSS JOIN dv q GROUP BY p.p)"
-        " t\n"
-        "         WHERE t.nf = 0)",
-        # quadratic residues per prime from the square census
-        "qr AS{mat} (SELECT DISTINCT p.p, (t.t*t.t) % p.p AS"
-        " a\n"
-        "         FROM pr p JOIN tt t ON t.t < p.p)",
-        # the candidate root a^((p+1) div 4) by square-multiply
-        "m0 AS (SELECT p, a, CAST((p + 1) {d} 4 AS BIGINT) AS"
-        " e,\n"
-        "           CAST(1 AS BIGINT) AS acc FROM qr)",
-    ]
-    for s, i in enumerate(range(4, -1, -1)):
-        parts.append(
-            f"m{s + 1} AS{{mat}} (SELECT p, a, e,\n"
-            f"           (((acc*acc) % p) * (CASE WHEN"
-            f" (e {{d}} {2 ** i}) % 2 = 1\n"
-            f"             THEN a ELSE 1 END)) % p AS acc\n"
-            f"         FROM m{s})")
-    parts += [
-        "rv AS{mat} (SELECT m.p, m.a, m.acc,\n"
-        "           CASE WHEN (m.acc*m.acc) % m.p = m.a THEN 1\n"
-        "             ELSE 0 END AS ok\n"
-        "         FROM m5 m)",
-        "cv AS (SELECT\n"
-        "           CAST(sum(CASE WHEN p % 4 = 3 AND ok = 0\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " shortcut_viol,\n"
-        "           CAST(sum(CASE WHEN p % 4 = 1 AND ok = 0\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " fail_1mod4,\n"
-        "           CAST(sum(CASE WHEN p % 4 = 1 AND ok = 1\n"
-        "             THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " ok_1mod4\n"
-        "         FROM rv)",
-        # residue census: exactly (p-1)/2 nonzero QRs per prime
-        "nv AS (SELECT CAST(sum(CASE WHEN t.n <> (t.p - 1)"
-        " {d} 2\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " count_viol\n"
-        "         FROM (SELECT p, count(*) AS n FROM qr WHERE\n"
-        "           a >= 1 GROUP BY p) t)",
-        f"ld AS (SELECT CAST(count(*) AS BIGINT) AS n_docs"
-        f" FROM {tbl})",
-    ]
-    fin = (
-        "SELECT t.p, t.nqr, t.nok,\n"
-        "       c.shortcut_viol, c.fail_1mod4, c.ok_1mod4,\n"
-        "       n.count_viol, l.n_docs\n"
-        "FROM (SELECT p, CAST(sum(CASE WHEN a >= 1 THEN 1"
-        " ELSE 0 END)\n"
-        "         AS BIGINT) AS nqr,\n"
-        "         CAST(sum(CASE WHEN a >= 1 THEN ok ELSE 0"
-        " END)\n"
-        "         AS BIGINT) AS nok\n"
-        "       FROM rv GROUP BY p) t\n"
-        "CROSS JOIN cv c CROSS JOIN nv n CROSS JOIN ld l")
-    return parts, fin
-
-
-def _q733_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q733_sql(tbl, d, mat)
-    out = []
-    for p in parts:
-        p = p.replace("{mat}", mat).replace("{d}", d)
-        out.append(p)
-    return (",\n       ".join(out) + "\n"
-            + fin.replace("{d}", d))
-
-
-@query("q733_modular_sqrt",
-       "WITH " + _q733_join("documents", "//", " MATERIALIZED"))
-def q733(spark, sf_dir):
-    """Square roots mod p — the a^((p+1)/4) shortcut proved
-    exact on the 3-mod-4 half and its near-total failure
-    QUANTIFIED on the other half (Lagrange's classical
-    observation; this single exponentiation is how every ECC
-    library decompresses points on curves over p = 3 mod 4
-    fields — secp256k1 among them — while p = 1 mod 4 forces
-    the full Tonelli–Shanks machinery, and this query shows
-    exactly why).  All primes up to 99 come from relational
-    trial division; each prime's nonzero quadratic residues
-    come from the square census, with the count certified at
-    exactly (p-1)/2 (count_viol == 0 — half the elements are
-    squares).  The candidate root a^((p+1) div 4) computes by
-    five shared square-and-multiply stages for EVERY (p, a)
-    pair; squaring it back: for p = 3 mod 4 the shortcut
-    succeeds on every residue of every prime (shortcut_viol ==
-    0 — because (p+1)/4 is an integer and a^((p+1)/2) =
-    a chi(a) = a), while for p = 1 mod 4 the floored exponent
-    fails on ALL BUT ONE residue per prime (fail_1mod4 == 241
-    vs ok_1mod4 == 11, the lone survivor being a = 1) — the
-    dividing line between one-shot decompression and the
-    iterative algorithm, drawn by census.  Scale: a shared
-    modexp sweep over ~1.1k (p, a) pairs; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q733_documents")
-    parts, fin = _q733_sql("q733_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q733_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("pp", "dv", "tt", "pr", "qr", "rv") or \
-                (nm[0] == "m" and nm[1:].isdigit()):
-            body = _qual(fr.split(" AS ", 1)[1].strip())
-            _pin_view(spark, body[1:-1], f"q733_{nm}",
-                      max_rows=3000)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin).replace("{d}", "div"))
-
-
-# ---------------------------------------------------------------------------
-# q734: LZ77 greedy parsing is optimal — the factorization behind
-# every deflate/zstd stream a crawler ingests, certified against the
-# jump-game BFS minimum on real document text
-
-
-def _q734_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"dk AS (SELECT CAST(doc_id % 65 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 65)",
-        f"ds AS (SELECT doc_id, substr(text, 1, 64) AS s,\n"
-        f"           CAST(length(substr(text, 1, 64)) AS BIGINT)"
-        f" AS n\n"
-        f"         FROM {tbl} WHERE doc_id < 8)",
-        "pos AS{mat} (SELECT d.doc_id, k.k + 1 AS i, d.s, d.n\n"
-        "         FROM ds d JOIN dk k ON k.k + 1 <= d.n + 1)",
-        # longest previous-occurrence match at i (overlap allowed:
-        # source j < i may run past i — self-referential copies)
-        "ml AS{mat} (SELECT p.doc_id, p.i,\n"
-        "           coalesce(max(CASE WHEN j.k + 1 < p.i\n"
-        "             AND p.i + L.k <= p.n\n"
-        "             AND substr(p.s, j.k + 1, L.k + 1) =\n"
-        "                 substr(p.s, p.i, L.k + 1)\n"
-        "             THEN L.k + 1 END), CAST(0 AS BIGINT)) AS"
-        " ml\n"
-        "         FROM pos p JOIN dk j ON j.k + 1 < p.i\n"
-        "         JOIN dk L ON p.i + L.k <= p.n\n"
-        "         WHERE p.i <= p.n\n"
-        "         GROUP BY p.doc_id, p.i)",
-        # nxt (greedy reach) and its prefix-max (BFS reach), with
-        # the absorbing state n+1
-        "na AS{mat} (SELECT doc_id, p, jmp, n,\n"
-        "           max(jmp) OVER (PARTITION BY doc_id ORDER BY"
-        " p\n"
-        "             ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        " CURRENT ROW)\n"
-        "             AS gjmp\n"
-        "         FROM (SELECT p.doc_id, p.i AS p,\n"
-        "             CASE WHEN p.i > p.n THEN p.n + 1\n"
-        "                  ELSE least(p.i + (CASE WHEN m.ml > 1\n"
-        "                    THEN m.ml ELSE 1 END), p.n + 1)\n"
-        "             END AS jmp, p.n AS n\n"
-        "           FROM pos p LEFT JOIN ml m\n"
-        "             ON m.doc_id = p.doc_id AND m.i = p.i) b)",
-        # machine A: the greedy parse walk (phrase starts exactly
-        # the orbit of 1 under jmp)
-        "wa AS (SELECT doc_id, CAST(1 AS BIGINT) AS pos,\n"
-        "           CAST(0 AS BIGINT) AS cnt, n FROM ds\n"
-        "         UNION ALL\n"
-        "         SELECT w.doc_id, a.jmp, w.cnt + 1, w.n\n"
-        "         FROM wa w JOIN na a ON a.doc_id = w.doc_id\n"
-        "           AND a.p = w.pos\n"
-        "         WHERE w.pos <= w.n)",
-        # machine B: the jump-game BFS frontier (prefix-max reach
-        # = positions coverable in <= t phrases), the true DP min
-        "wb AS (SELECT doc_id, CAST(1 AS BIGINT) AS pos,\n"
-        "           CAST(0 AS BIGINT) AS cnt, n FROM ds\n"
-        "         UNION ALL\n"
-        "         SELECT w.doc_id, b.gjmp, w.cnt + 1, w.n\n"
-        "         FROM wb w JOIN na b ON b.doc_id = w.doc_id\n"
-        "           AND b.p = w.pos\n"
-        "         WHERE w.pos <= w.n)",
-        "ca AS (SELECT doc_id, max(cnt) AS greedy_phrases\n"
-        "         FROM wa WHERE pos > n GROUP BY doc_id)",
-        "cb AS (SELECT doc_id, max(cnt) AS opt_phrases\n"
-        "         FROM wb WHERE pos > n GROUP BY doc_id)",
-        # the suffix lemma ml(i+1) >= ml(i) - 1 and its corollary
-        # reach monotonicity — the two facts that MAKE greedy
-        # optimal — checked as data
-        "mv AS (SELECT CAST(sum(CASE WHEN b.ml < a.ml - 1\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " suffix_viol\n"
-        "         FROM ml a JOIN ml b ON b.doc_id = a.doc_id\n"
-        "           AND b.i = a.i + 1)",
-        "rv AS (SELECT CAST(sum(CASE WHEN b.jmp < a.jmp\n"
-        "           THEN 1 ELSE 0 END) AS BIGINT) AS reach_viol\n"
-        "         FROM na a JOIN na b ON b.doc_id = a.doc_id\n"
-        "           AND b.p = a.p + 1)",
-        "mm AS (SELECT doc_id, max(ml) AS max_ml,\n"
-        "           CAST(sum(CASE WHEN ml > 1 THEN 1 ELSE 0"
-        " END)\n"
-        "             AS BIGINT) AS n_copyable\n"
-        "         FROM ml GROUP BY doc_id)",
-    ]
-    fin = (
-        "SELECT d.doc_id, d.n, ca.greedy_phrases,"
-        " cb.opt_phrases,\n"
-        "       CASE WHEN ca.greedy_phrases = cb.opt_phrases\n"
-        "         THEN 1 ELSE 0 END AS greedy_optimal,\n"
-        "       mm.max_ml, mm.n_copyable, mv.suffix_viol,\n"
-        "       rv.reach_viol\n"
-        "FROM ds d JOIN ca ON ca.doc_id = d.doc_id\n"
-        "JOIN cb ON cb.doc_id = d.doc_id\n"
-        "JOIN mm ON mm.doc_id = d.doc_id\n"
-        "CROSS JOIN mv CROSS JOIN rv")
-    return parts, fin
-
-
-def _q734_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q734_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q734_lz77_parsing",
-       "WITH RECURSIVE " + _q734_join("documents", "//",
-                                      " MATERIALIZED"))
-def q734(spark, sf_dir):
-    """LZ77 greedy parsing is OPTIMAL — Ziv-Lempel 1977, the
-    factorization inside every deflate/gzip/zstd stream a web
-    crawler decompresses, certified on real document text
-    against an independent DP machine.  For each position i of
-    a 96-char document prefix, ml(i) = the longest match
-    starting at some j < i (overlap allowed — self-referential
-    copies are what let LZ77 encode runs), computed by an
-    exhaustive (j, L) census.  The greedy parse jumps
-    nxt(i) = i + max(1, ml(i)); the minimum-phrase parse is
-    the jump-game BFS over the prefix-max reach (machine B) —
-    and the two phrase counts agree on every document
-    (greedy_optimal == 1), which is the classical theorem that
-    greedy LZ77 minimizes the number of phrases.  WHY it holds
-    is certified alongside: the suffix lemma ml(i+1) >=
-    ml(i) - 1 (a copyable string's suffix is copyable,
-    suffix_viol == 0) forces reach monotonicity (reach_viol ==
-    0), and monotone reach makes max-jump greedy the BFS
-    optimum.  Engine: the match census is one relational
-    aggregation; the two walks run per-doc in one
-    applyInPandas pass (the per-entity recurrence template);
-    the oracle replays them as WITH RECURSIVE walks.  Scale:
-    census is O(docs * w^3) in the window w per doc —
-    window-bounded like real LZ; walks are O(n) per doc,
-    distributed per entity."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q734_documents")
-    parts, fin = _q734_sql("q734_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    # pin the heavy census + jump tables (fixture-bounded dims)
-    _pin_view(spark,
-              "WITH " + ",\n".join(frags[n] for n in
-                                   ("dk", "ds", "pos")) + "\n"
-              + body("ml"),
-              "q734_ml", max_rows=1024)
-    _pin_view(spark,
-              "WITH " + ",\n".join(frags[n] for n in
-                                   ("dk", "ds", "pos")) + "\n"
-              + body("na").replace(" ml m", " q734_ml m"),
-              "q734_na", max_rows=1024)
-
-    # the two walks: per-doc sequential orbit — applyInPandas
-    # (per-entity recurrence template; oracle = WITH RECURSIVE)
-    def _walk(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("p")
-        n = int(pdf["n"].iloc[0])
-        jmp = pdf["jmp"].to_numpy()
-        gj = pdf["gjmp"].to_numpy()
-
-        def cnt(arr):
-            q, c = 1, 0
-            while q <= n:
-                q = int(arr[q - 1])
-                c += 1
-            return c
-
-        return pd.DataFrame(
-            {"doc_id": [int(pdf["doc_id"].iloc[0])],
-             "greedy_phrases": [cnt(jmp)],
-             "opt_phrases": [cnt(gj)]})
-
-    wk = spark.table("q734_na").groupBy("doc_id").applyInPandas(
-        _walk,
-        "doc_id long, greedy_phrases long, opt_phrases long")
-    wk.createOrReplaceTempView("q734_wk")
-    spark.sql("SELECT doc_id, greedy_phrases FROM q734_wk") \
-        .createOrReplaceTempView("q734_ca")
-    spark.sql("SELECT doc_id, opt_phrases FROM q734_wk") \
-        .createOrReplaceTempView("q734_cb")
-
-    fin_sql = (
-        "WITH ds AS (" + body("ds") + "),\n"
-        "mv AS (" + body("mv").replace(" ml a", " q734_ml a")
-        .replace(" ml b", " q734_ml b") + "),\n"
-        "rv AS (" + body("rv").replace(" na a", " q734_na a")
-        .replace(" na b", " q734_na b") + "),\n"
-        "mm AS (" + body("mm").replace("FROM ml", "FROM q734_ml")
-        + ")\n"
-        + fin.replace("JOIN ca", "JOIN q734_ca ca")
-        .replace("JOIN cb", "JOIN q734_cb cb"))
-    return spark.sql(fin_sql)
-
-
-# ---------------------------------------------------------------------------
-# q735: Good-Turing frequency estimation with the missing-mass
-# theorem as an exact integer telescoping identity
-
-
-def _q735_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # word-position dim: doc_ids are contiguous 0..499, docs
-        # hold <= 99 words — 128 slots with a loud overflow column
-        f"kd AS (SELECT CAST(doc_id + 1 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 128)",
-        f"tk AS{{mat}} (SELECT t.doc_id,\n"
-        f"           split_part(t.text, ' ', CAST(k.k AS INT))"
-        f" || ' ' ||\n"
-        f"           split_part(t.text, ' ', CAST(k.k AS INT) +"
-        f" 1) || ' ' ||\n"
-        f"           split_part(t.text, ' ', CAST(k.k AS INT) +"
-        f" 2) AS w\n"
-        f"         FROM {tbl} t CROSS JOIN kd k\n"
-        f"         WHERE split_part(t.text, ' ', CAST(k.k AS"
-        f" INT) + 2) <> ''\n"
-        f"           AND split_part(t.text, ' ', CAST(k.k AS"
-        f" INT)) <> '')",
-        f"ov AS (SELECT CAST(sum(CASE WHEN split_part(text, ' ',"
-        f" 131) <> ''\n"
-        f"           THEN 1 ELSE 0 END) AS BIGINT) AS"
-        f" overflow_docs\n"
-        f"         FROM {tbl})",
-        "wc AS{mat} (SELECT w, CAST(count(*) AS BIGINT) AS r\n"
-        "         FROM tk GROUP BY w)",
-        "nr AS{mat} (SELECT r, CAST(count(*) AS BIGINT) AS n_r\n"
-        "         FROM wc GROUP BY r)",
-        "tot AS (SELECT CAST(sum(r * n_r) AS BIGINT) AS big_n,\n"
-        "           CAST(sum(n_r) AS BIGINT) AS vocab,\n"
-        "           CAST(coalesce(max(CASE WHEN r = 1 THEN n_r"
-        " END), 0)\n"
-        "             AS BIGINT) AS n1\n"
-        "         FROM nr)",
-        # Turing's estimator: r* = (r+1) N_{r+1} / N_r; the
-        # total adjusted count per r is the INTEGER (r+1)N_{r+1}
-        "gt AS (SELECT a.r, a.n_r,\n"
-        "           (a.r + 1) * coalesce(b.n_r, 0) AS gt_num,\n"
-        "           a.n_r AS gt_den\n"
-        "         FROM nr a LEFT JOIN nr b ON b.r = a.r + 1)",
-        # the missing-mass theorem, telescoped exactly:
-        # sum_r (r+1) N_{r+1} = N - N_1, all integers
-        "cv AS (SELECT\n"
-        "           CAST(sum(gt_num) AS BIGINT) AS adj_total\n"
-        "         FROM gt)",
-        "tc AS (SELECT CAST(count(*) AS BIGINT) AS n_tokens"
-        " FROM tk)",
-    ]
-    fin = (
-        "SELECT g.r, g.n_r, g.gt_num, g.gt_den,\n"
-        "       t.big_n, t.vocab, t.n1,\n"
-        "       c.adj_total - (t.big_n - t.n1) AS"
-        " telescope_viol,\n"
-        "       t.big_n - x.n_tokens AS cons_viol,\n"
-        "       o.overflow_docs\n"
-        "FROM gt g CROSS JOIN tot t CROSS JOIN cv c\n"
-        "CROSS JOIN tc x CROSS JOIN ov o\n"
-        "WHERE g.r <= 12")
-    return parts, fin
-
-
-def _q735_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q735_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q735_good_turing",
-       "WITH " + _q735_join("documents", "//", " MATERIALIZED"))
-def q735(spark, sf_dir):
-    """Good-Turing frequency estimation over the real corpus
-    vocabulary — Good 1953, from Turing's Enigma cryptanalysis;
-    the smoothing that underlies Katz backoff and the
-    missing-mass bound every language-model pipeline leans on.
-    The estimated species are word TRIGRAMS of the real corpus
-    (the vocabulary itself has no rare words — the trigram tail
-    is genuinely Zipfian, N_1 in the thousands), enumerated by
-    a split_part position dim with a loud overflow column
-    (overflow_docs == 0 certifies the 128-slot dim covers every
-    document).  Type counts r, frequencies-of-frequencies N_r,
-    and Turing's
-    estimator r* = (r+1) N_{r+1} / N_r emitted as an EXACT
-    integer pair (gt_num, gt_den) per r.  The celebrated
-    missing-mass theorem is certified as pure integer
-    telescoping: the total Good-Turing-adjusted count
-    sum_r (r+1) N_{r+1} equals N - N_1 exactly
-    (telescope_viol == 0) — i.e. the estimator reserves
-    probability N_1 / N for unseen species, Turing's answer to
-    'how many Enigma keys have we never seen'.  Token
-    conservation sum_r r N_r == count(tokens) rides along
-    (cons_viol == 0).  Scale: one explode + two aggregations,
-    all map-side combinable; the N_r table is tiny at any
-    corpus size."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q735_documents")
-    parts, fin = _q735_sql("q735_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q735_{nm}", text)
-        return text
-
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-    # engine-native tokenization: split once + transform, not
-    # the O(len x positions) split_part enumeration the shared
-    # oracle uses (identical values: single-spaced text, <= 128
-    # words — both measured)
-    _ckpt_view(spark,
-               "SELECT doc_id, tri AS w FROM (SELECT doc_id,"
-               " explode(CASE WHEN size(ws) >= 3 THEN"
-               " transform(sequence(1, size(ws) - 2),"
-               " i -> concat(ws[i-1], ' ', ws[i], ' ',"
-               " ws[i+1])) ELSE array() END) AS tri FROM"
-               " (SELECT doc_id, filter(split(text, ' '),"
-               " x -> x <> '') AS ws FROM q735_documents) z)"
-               " y", "q735_tk")
-    kept = [re.sub(r"\btk\b", "q735_tk", frags[n])
-            for n in ("ov", "wc", "nr", "tot", "gt", "cv",
-                      "tc")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q736: Myers bit-parallel edit distance — the automaton's registers
-# certified bit-for-bit against the DP delta encoding
-
-
-_Q736_ORACLE = """
-WITH RECURSIVE
-pr AS MATERIALIZED (SELECT CAST(a.doc_id // 2 AS BIGINT) AS pair_id,
-        substr(a.text, 1, 24) AS sa, substr(b.text, 1, 24) AS sb,
-        CAST(length(substr(a.text, 1, 24)) AS BIGINT) AS m,
-        CAST(length(substr(b.text, 1, 24)) AS BIGINT) AS n
-       FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-       WHERE a.doc_id % 2 = 0 AND a.doc_id < 24),
-dp AS (SELECT pair_id, CAST(0 AS BIGINT) AS j,
-        list_transform(range(0, CAST(m AS INT) + 1),
-                       i -> CAST(i AS BIGINT)) AS col,
-        sa, sb, m, n
-       FROM pr
-       UNION ALL
-       -- one DP column per recursion step; the intra-column +1
-       -- insertion chain is closed-formed as a prefix-min of
-       -- t[k] - k (t = the two cross-column candidates), so the
-       -- list comprehension has no sequential dependency
-       SELECT pair_id, j + 1,
-        list_transform(range(0, CAST(m AS INT) + 1), i ->
-          CASE WHEN i = 0 THEN j + 1
-          ELSE
-            list_min(list_transform(range(0, i + 1), k ->
-              CASE WHEN k = 0 THEN j + 1
-                   ELSE least(col[k + 1] + 1,
-                              col[k] + CASE WHEN substr(sa, k, 1) =
-                                substr(sb, CAST(j AS INT) + 1, 1)
-                                THEN 0 ELSE 1 END) - k
-              END)) + i
-          END),
-        sa, sb, m, n
-       FROM dp WHERE j < n),
-id AS (SELECT CAST(doc_id + 1 AS BIGINT) AS i FROM documents
-       WHERE doc_id < 24),
-cells AS (SELECT d.pair_id, d.j, i.i,
-        d.col[CAST(i.i AS INT) + 1] - d.col[CAST(i.i AS INT)]
-          AS delta
-       FROM dp d JOIN id i ON i.i <= d.m),
-mk AS (SELECT pair_id, j,
-        CAST(sum(CASE WHEN delta = 1 THEN
-          (CAST(1 AS BIGINT) << CAST(i - 1 AS INT))
-          ELSE 0 END) AS BIGINT) AS vp,
-        CAST(sum(CASE WHEN delta = -1 THEN
-          (CAST(1 AS BIGINT) << CAST(i - 1 AS INT))
-          ELSE 0 END) AS BIGINT) AS vn
-       FROM cells GROUP BY pair_id, j),
-sc AS (SELECT pair_id, j, col[CAST(m AS INT) + 1] AS score
-       FROM dp)
-SELECT m.pair_id, m.j, m.vp, m.vn, s.score
-FROM mk m JOIN sc s ON s.pair_id = m.pair_id AND s.j = m.j
-"""
-
-
-@query("q736_myers_bitparallel", _Q736_ORACLE)
-def q736(spark, sf_dir):
-    """Myers's bit-parallel edit distance (Myers 1999 — the
-    O(nm/w) automaton inside agrep, BWA and every fast fuzzy
-    matcher) certified REGISTER-FOR-REGISTER against the
-    classical Wagner-Fischer DP on real document text.  The
-    theorem that makes the algorithm work is that the two bit
-    registers ARE the DP column's delta encoding: VP bit i =
-    [D[i][j] - D[i-1][j] = +1], VN bit i = [= -1], and the
-    running score = D[m][j].  The engine runs the genuine
-    bit-parallel recurrence (Eq/Xv/Xh/HP/HN word operations,
-    one word per column — strings are 24 chars, under the
-    32-bit packing cap) per pair in one applyInPandas pass and
-    emits every column's (vp, vn, score); the oracle knows
-    nothing of bit tricks — it replays the textbook DP as a
-    WITH RECURSIVE column walk (the intra-column insertion
-    chain closed-formed as a prefix-min, so each column is a
-    pure list comprehension), decodes the vertical deltas
-    relationally, and re-packs them into the same masks.
-    Equality of the two tables at every (pair, column) IS
-    Myers's invariant — 300 rows of it.  Scale: per-entity
-    recurrence template; pairs distribute, each costs O(n)
-    word ops."""
-    docs = _t(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("q736_documents")
-    pr = spark.sql(
-        "SELECT CAST(a.doc_id div 2 AS BIGINT) AS pair_id,\n"
-        "       substr(a.text, 1, 24) AS sa,\n"
-        "       substr(b.text, 1, 24) AS sb\n"
-        "FROM q736_documents a JOIN q736_documents b\n"
-        "  ON b.doc_id = a.doc_id + 1\n"
-        "WHERE a.doc_id % 2 = 0 AND a.doc_id < 24")
-
-    def _myers(pdf: pd.DataFrame) -> pd.DataFrame:
-        sa = pdf["sa"].iloc[0]
-        sb = pdf["sb"].iloc[0]
-        pid = int(pdf["pair_id"].iloc[0])
-        m = len(sa)
-        mask = (1 << m) - 1
-        peq: dict = {}
-        for i, c in enumerate(sa):
-            peq[c] = peq.get(c, 0) | (1 << i)
-        vp, vn, score = mask, 0, m
-        rows = [(pid, 0, vp, vn, score)]
-        for j, c in enumerate(sb, 1):
-            eq = peq.get(c, 0)
-            xv = eq | vn
-            xh = (((eq & vp) + vp) ^ vp) | eq
-            hp = vn | (~(xh | vp) & mask)
-            hn = vp & xh
-            if hp & (1 << (m - 1)):
-                score += 1
-            elif hn & (1 << (m - 1)):
-                score -= 1
-            hp2 = ((hp << 1) | 1) & mask
-            hn2 = (hn << 1) & mask
-            vp = (hn2 | (~(xv | hp2) & mask)) & mask
-            vn = hp2 & xv
-            rows.append((pid, j, vp, vn, score))
-        return pd.DataFrame(
-            rows, columns=["pair_id", "j", "vp", "vn", "score"])
-
-    return pr.groupBy("pair_id").applyInPandas(
-        _myers, "pair_id long, j long, vp long, vn long,"
-        " score long")
-
-
-# ---------------------------------------------------------------------------
-# q737: UTF-8 validation as a relational DFA — RFC 3629's table
-# certified against Python's real decoder on planted byte streams
-
-
-def _q737_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"sd AS (SELECT CAST(doc_id AS BIGINT) AS sid"
-        f" FROM {tbl} WHERE doc_id < 64)",
-        f"pp AS (SELECT CAST(doc_id + 1 AS BIGINT) AS pos"
-        f" FROM {tbl} WHERE doc_id < 24)",
-        # 64 byte streams, one scenario class per sid % 16:
-        # valid ASCII / 2-byte / 3-byte / 4-byte runs; overlong
-        # C0 AF and E0 9F BF; CESU surrogate ED A0 80; beyond-
-        # U+10FFFF F4 90; bare continuation; truncation at end
-        # and mid-stream; F8 / F5 / C1 leads; boundary codepoints
-        "by AS{mat} (SELECT s.sid, p.pos,\n"
-        " CASE\n"
-        "  WHEN s.sid % 16 = 1 THEN CASE WHEN p.pos % 2 = 1"
-        " THEN 195 ELSE 169 END\n"
-        "  WHEN s.sid % 16 = 2 THEN CASE WHEN p.pos % 3 = 1"
-        " THEN 226 WHEN p.pos % 3 = 2 THEN 130 ELSE 172 END\n"
-        "  WHEN s.sid % 16 = 3 THEN CASE WHEN p.pos % 4 = 1"
-        " THEN 240 WHEN p.pos % 4 = 2 THEN 159 WHEN p.pos % 4"
-        " = 3 THEN 152 ELSE 128 END\n"
-        "  WHEN s.sid % 16 = 4 AND p.pos = 10 THEN 192\n"
-        "  WHEN s.sid % 16 = 4 AND p.pos = 11 THEN 175\n"
-        "  WHEN s.sid % 16 = 5 AND p.pos = 10 THEN 224\n"
-        "  WHEN s.sid % 16 = 5 AND p.pos = 11 THEN 159\n"
-        "  WHEN s.sid % 16 = 5 AND p.pos = 12 THEN 191\n"
-        "  WHEN s.sid % 16 = 6 AND p.pos = 10 THEN 237\n"
-        "  WHEN s.sid % 16 = 6 AND p.pos = 11 THEN 160\n"
-        "  WHEN s.sid % 16 = 6 AND p.pos = 12 THEN 128\n"
-        "  WHEN s.sid % 16 = 7 AND p.pos = 10 THEN 244\n"
-        "  WHEN s.sid % 16 = 7 AND p.pos = 11 THEN 144\n"
-        "  WHEN s.sid % 16 = 7 AND p.pos IN (12, 13) THEN 128\n"
-        "  WHEN s.sid % 16 = 8 AND p.pos = 5 THEN 128\n"
-        "  WHEN s.sid % 16 = 9 AND p.pos = 23 THEN 226\n"
-        "  WHEN s.sid % 16 = 9 AND p.pos = 24 THEN 130\n"
-        "  WHEN s.sid % 16 = 10 AND p.pos = 10 THEN 195\n"
-        "  WHEN s.sid % 16 = 11 AND p.pos = 10 THEN 248\n"
-        "  WHEN s.sid % 16 = 12 AND p.pos = 10 THEN 193\n"
-        "  WHEN s.sid % 16 = 12 AND p.pos = 11 THEN 175\n"
-        "  WHEN s.sid % 16 = 13 AND p.pos = 1 THEN 194\n"
-        "  WHEN s.sid % 16 = 13 AND p.pos = 2 THEN 128\n"
-        "  WHEN s.sid % 16 = 13 AND p.pos = 3 THEN 239\n"
-        "  WHEN s.sid % 16 = 13 AND p.pos IN (4, 5) THEN 191\n"
-        "  WHEN s.sid % 16 = 14 AND p.pos = 10 THEN 245\n"
-        "  WHEN s.sid % 16 = 14 AND p.pos = 11 THEN 128\n"
-        "  WHEN s.sid % 16 = 15 AND p.pos = 1 THEN 127\n"
-        "  WHEN s.sid % 16 = 15 AND p.pos = 2 THEN 194\n"
-        "  WHEN s.sid % 16 = 15 AND p.pos = 3 THEN 128\n"
-        "  WHEN s.sid % 16 = 15 AND p.pos = 4 THEN 244\n"
-        "  WHEN s.sid % 16 = 15 AND p.pos = 5 THEN 143\n"
-        "  WHEN s.sid % 16 = 15 AND p.pos IN (6, 7) THEN 191\n"
-        "  ELSE 97 + ((p.pos * 5 + s.sid) % 26)\n"
-        " END AS b\n"
-        " FROM sd s CROSS JOIN pp p)",
-        "st AS (SELECT sid, pos, b,\n"
-        "  CASE WHEN b >= 128 AND b < 192 THEN 1 ELSE 0 END"
-        " AS is_cont,\n"
-        "  lead(b, 1) OVER w AS b1, lead(b, 2) OVER w AS b2,\n"
-        "  lead(b, 3) OVER w AS b3\n"
-        " FROM by WINDOW w AS (PARTITION BY sid ORDER BY pos))",
-        # per-start declared length + the full RFC 3629 second-
-        # byte table (E0/ED/F0/F4 special ranges kill overlongs,
-        # surrogates and beyond-U+10FFFF in one comparison each)
-        "ln AS (SELECT sid, pos,\n"
-        " CASE WHEN b < 128 THEN 1\n"
-        "      WHEN b >= 194 AND b <= 223 THEN 2\n"
-        "      WHEN b >= 224 AND b <= 239 THEN 3\n"
-        "      WHEN b >= 240 AND b <= 244 THEN 4\n"
-        "      ELSE 1 END AS ln,\n"
-        " CASE WHEN b IN (192, 193) OR b >= 245 THEN 1 ELSE 0"
-        " END AS bad_lead,\n"
-        " CASE\n"
-        "  WHEN b >= 194 AND b <= 223 THEN\n"
-        "    CASE WHEN b1 >= 128 AND b1 < 192 THEN 0 ELSE 1"
-        " END\n"
-        "  WHEN b >= 224 AND b <= 239 THEN\n"
-        "    CASE WHEN b1 >= (CASE WHEN b = 224 THEN 160 ELSE"
-        " 128 END)\n"
-        "          AND b1 <= (CASE WHEN b = 237 THEN 159 ELSE"
-        " 191 END)\n"
-        "          AND b2 >= 128 AND b2 < 192 THEN 0 ELSE 1"
-        " END\n"
-        "  WHEN b >= 240 AND b <= 244 THEN\n"
-        "    CASE WHEN b1 >= (CASE WHEN b = 240 THEN 144 ELSE"
-        " 128 END)\n"
-        "          AND b1 <= (CASE WHEN b = 244 THEN 143 ELSE"
-        " 191 END)\n"
-        "          AND b2 >= 128 AND b2 < 192\n"
-        "          AND b3 >= 128 AND b3 < 192 THEN 0 ELSE 1"
-        " END\n"
-        "  ELSE 0 END AS seq_viol\n"
-        " FROM st WHERE is_cont = 0)",
-        # sequence tiling: consecutive starts must be exactly
-        # ln apart (strays, truncations and unconsumed
-        # continuations all break the gap)
-        "nx AS (SELECT sid, pos, ln, bad_lead, seq_viol,\n"
-        "  coalesce(lead(pos, 1) OVER (PARTITION BY sid ORDER"
-        " BY pos), 25) AS nxs\n"
-        " FROM ln)",
-        "nb AS (SELECT sid, CAST(sum(CASE WHEN b IN (192, 193)"
-        " OR b >= 245\n"
-        "  THEN 1 ELSE 0 END) AS BIGINT) AS n_bad FROM by"
-        " GROUP BY sid)",
-        "vs AS (SELECT sid,\n"
-        "  CASE WHEN sum(bad_lead + seq_viol +\n"
-        "    CASE WHEN nxs <> pos + ln THEN 1 ELSE 0 END) = 0\n"
-        "   AND min(pos) = 1 THEN 1 ELSE 0 END AS dfa_valid,\n"
-        "  CAST(count(*) AS BIGINT) AS n_starts\n"
-        " FROM nx GROUP BY sid)",
-        "pv AS (SELECT sid, dfa_valid AS python_valid FROM vs)",
-    ]
-    fin = (
-        "SELECT v.sid, v.dfa_valid, p.python_valid,\n"
-        "  CASE WHEN v.dfa_valid = p.python_valid THEN 1 ELSE 0"
-        " END AS agree,\n"
-        "  v.n_starts, b.n_bad\n"
-        "FROM vs v JOIN pv p ON p.sid = v.sid\n"
-        "JOIN nb b ON b.sid = v.sid")
-    return parts, fin
-
-
-def _q737_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q737_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q737_utf8_validation",
-       "WITH " + _q737_join("documents", "//", " MATERIALIZED"))
-def q737(spark, sf_dir):
-    """UTF-8 validation as a PURELY RELATIONAL DFA — the RFC
-    3629 byte-class table a crawler's ingest path runs on every
-    WARC payload, certified against CPython's real strict
-    decoder.  UTF-8's killer property is LOCAL checkability: a
-    stream is valid iff every non-continuation byte starts a
-    well-formed sequence and consecutive starts tile exactly —
-    so the whole validator is two window passes (3-byte
-    lookahead + next-start gap), no recursion, no state
-    machine.  The second-byte table (E0 needs A0-BF, ED stops
-    at 9F, F0 starts at 90, F4 stops at 8F) kills overlong
-    encodings, CESU surrogates and beyond-U+10FFFF in one range
-    comparison each.  64 planted streams cover every failure
-    class: overlong C0 AF and E0 9F BF, surrogate ED A0 80,
-    F4 90 (> U+10FFFF), bare continuation, truncation at end
-    and mid-stream, C1/F5/F8 leads, plus valid ASCII / 2 / 3 /
-    4-byte runs and the boundary codepoints U+007F, U+0080,
-    U+FFFF, U+10FFFF.  The ENGINE's python_valid column comes
-    from genuinely calling bytes.decode('utf-8') per stream in
-    one applyInPandas pass; the oracle computes the DFA only —
-    the comparator enforcing engine-Python == oracle-DFA (and
-    agree == 1 on every row) IS the cross-machine certificate.
-    Scale: window passes over byte positions — linear,
-    partition-local per stream."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q737_documents")
-    parts, fin = _q737_sql("q737_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q737_{nm}", text)
-        return text
-
-    frags = {fr.replace("{mat}", "").replace("{d}", "div")
-             .split(" AS ", 1)[0].strip():
-             fr.replace("{mat}", "").replace("{d}", "div")
-             for fr in parts}
-    by_sql = ("WITH " + frags["sd"] + ",\n" + frags["pp"] + "\n"
-              + frags["by"].split(" AS ", 1)[1].strip()[1:-1])
-
-    def _decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        bb = bytes(int(x) for x in pdf["b"])
-        try:
-            bb.decode("utf-8")
-            ok = 1
-        except UnicodeDecodeError:
-            ok = 0
-        return pd.DataFrame(
-            {"sid": [int(pdf["sid"].iloc[0])],
-             "python_valid": [ok]})
-
-    spark.sql(by_sql).groupBy("sid").applyInPandas(
-        _decode, "sid long, python_valid long") \
-        .createOrReplaceTempView("q737_pv")
-    done.append("pv")
-    kept = [_qual(frags[nm]) for nm in
-            ("sd", "pp", "by", "st", "ln", "nx", "nb", "vs")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q738: Google encoded-polyline codec — zigzag + base-64-offset
-# varint chunks, roundtrip- and prefix-certified in pure integers
-
-
-def _q738_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"pt AS (SELECT CAST(doc_id % 4 AS BIGINT) AS path_id,\n"
-        f"        CAST(doc_id {{d}} 4 AS BIGINT) AS seq,\n"
-        f"        (CAST(doc_id AS BIGINT) * 7919 % 16000) *"
-        f" 1000 - 8000000 AS lat5,\n"
-        f"        (CAST(doc_id AS BIGINT) * 9973 % 36000) *"
-        f" 1000 - 18000000 AS lon5\n"
-        f"       FROM {tbl} WHERE doc_id < 64)",
-        "dl AS (SELECT path_id, seq, lat5, lon5,\n"
-        "        lat5 - coalesce(lag(lat5) OVER w, 0) AS dlat,\n"
-        "        lon5 - coalesce(lag(lon5) OVER w, 0) AS dlon\n"
-        "       FROM pt WINDOW w AS (PARTITION BY path_id"
-        " ORDER BY seq))",
-        # zigzag: negatives map to 2|d|-1 (the ~(v<<1) of the
-        # reference encoder), non-negatives to 2d
-        "zc AS{mat} (SELECT path_id, seq, CAST(0 AS BIGINT) AS"
-        " coord,\n"
-        "        CASE WHEN dlat < 0 THEN -2*dlat - 1 ELSE"
-        " 2*dlat END AS zz FROM dl\n"
-        "       UNION ALL\n"
-        "       SELECT path_id, seq, CAST(1 AS BIGINT),\n"
-        "        CASE WHEN dlon < 0 THEN -2*dlon - 1 ELSE"
-        " 2*dlon END FROM dl)",
-        f"kd AS (SELECT CAST(doc_id AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 7)",
-        "p32 AS (SELECT k, CASE k WHEN 0 THEN CAST(1 AS"
-        " BIGINT) WHEN 1 THEN 32\n"
-        "         WHEN 2 THEN 1024 WHEN 3 THEN 32768 WHEN 4"
-        " THEN 1048576\n"
-        "         WHEN 5 THEN 33554432 ELSE 1073741824 END AS"
-        " pw FROM kd)",
-        # little-endian 5-bit chunks; 0x20 continuation flag;
-        # +63 printable offset — the polyline5 wire format
-        "ch AS{mat} (SELECT z.path_id, z.seq, z.coord, p.k,\n"
-        "        (z.zz {d} p.pw) % 32 AS chunk,\n"
-        "        CASE WHEN z.zz {d} (p.pw * 32) > 0 THEN 1"
-        " ELSE 0 END AS more\n"
-        "       FROM zc z JOIN p32 p ON p.k = 0 OR z.zz {d}"
-        " p.pw > 0)",
-        "cd AS (SELECT path_id, seq, coord, k, chunk, more,\n"
-        "        63 + chunk + 32 * more AS code FROM ch)",
-        "dec AS (SELECT c.path_id, c.seq, c.coord,\n"
-        "        CAST(sum(((c.code - 63) % 32) * p.pw) AS"
-        " BIGINT) AS zz_dec,\n"
-        "        CAST(count(*) AS BIGINT) AS n_chunks,\n"
-        "        CAST(sum(c.code * (c.k + 1)) AS BIGINT) AS"
-        " chk\n"
-        "       FROM cd c JOIN p32 p ON p.k = c.k\n"
-        "       GROUP BY c.path_id, c.seq, c.coord)",
-        "rt AS (SELECT z.path_id, z.seq, z.coord, z.zz,"
-        " d.zz_dec, d.n_chunks, d.chk,\n"
-        "        CASE WHEN d.zz_dec % 2 = 1 THEN -((d.zz_dec +"
-        " 1) {d} 2)\n"
-        "             ELSE d.zz_dec {d} 2 END AS delta_dec\n"
-        "       FROM zc z JOIN dec d ON d.path_id = z.path_id\n"
-        "        AND d.seq = z.seq AND d.coord = z.coord)",
-        "rc AS (SELECT path_id, seq, coord,\n"
-        "        sum(delta_dec) OVER (PARTITION BY path_id,"
-        " coord ORDER BY seq\n"
-        "          ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        " CURRENT ROW) AS acc\n"
-        "       FROM rt)",
-    ]
-    fin = (
-        "SELECT r.path_id, r.seq,\n"
-        "  CAST(sum(CASE WHEN r.coord = 0 THEN r.n_chunks ELSE"
-        " 0 END) AS BIGINT) AS n_lat,\n"
-        "  CAST(sum(CASE WHEN r.coord = 1 THEN r.n_chunks ELSE"
-        " 0 END) AS BIGINT) AS n_lon,\n"
-        "  CAST(sum(r.chk * (r.coord + 1)) AS BIGINT) AS"
-        " poly_chk,\n"
-        "  CAST(sum(CASE WHEN r.zz_dec <> r.zz THEN 1 ELSE 0"
-        " END) AS BIGINT) AS rt_viol,\n"
-        "  CAST(sum(CASE WHEN c.acc <> (CASE WHEN r.coord = 0"
-        " THEN p.lat5 ELSE p.lon5 END)\n"
-        "    THEN 1 ELSE 0 END) AS BIGINT) AS prefix_viol\n"
-        "FROM rt r JOIN rc c ON c.path_id = r.path_id AND"
-        " c.seq = r.seq AND c.coord = r.coord\n"
-        "JOIN pt p ON p.path_id = r.path_id AND p.seq = r.seq\n"
-        "GROUP BY r.path_id, r.seq")
-    return parts, fin
-
-
-def _q738_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q738_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q738_polyline_codec",
-       "WITH " + _q738_join("documents", "//", " MATERIALIZED"))
-def q738(spark, sf_dir):
-    """The Google encoded-polyline codec (polyline5 — the wire
-    format every web map ships route geometry in) implemented
-    relationally and certified by exact integer roundtrip.
-    Coordinates are 1e5-scaled integers DERIVED in integer
-    arithmetic (never through a double); per-path deltas
-    (first point absolute), zigzag mapping with the reference
-    encoder's negative rule 2|d|-1 = ~(d<<1), little-endian
-    5-bit varint chunks with the 0x20 continuation flag and
-    +63 printable offset — chunk codes verified byte-for-byte
-    against the canonical encoder at design time and emitted
-    as an order-weighted checksum (poly_chk).  The DECODER
-    runs in the same plan: chunks reassemble to zigzag values
-    (rt_viol == 0 on every point), inverse zigzag recovers
-    deltas, and a window prefix-sum rebuilds every absolute
-    coordinate exactly (prefix_viol == 0) — encode o decode =
-    id as data, 64 points x 2 coordinates.  Scale: pure
-    Column arithmetic + two windows; chunk fan-out is bounded
-    (<= 7 per value); no Python anywhere."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q738_documents")
-    parts, fin = _q738_sql("q738_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q739: personalized PageRank by synchronized push — dyadic-exact
-# power series with the truncated-series symmetry certificate
-
-
-def _q739_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"nd AS (SELECT CAST(doc_id AS BIGINT) AS v"
-        f" FROM {tbl} WHERE doc_id < 64)",
-        "og AS (SELECT CAST(x AS BIGINT) AS x FROM (VALUES"
-        " (1), (63), (8), (56)) t(x))",
-        # 4-regular circulant: i ~ i+-1, i+-8 mod 64 —
-        # undirected, vertex-transitive, W symmetric
-        "ed AS (SELECT n.v AS u, (n.v + o.x) % 64 AS w FROM"
-        " nd n CROSS JOIN og o)",
-        "sc AS (SELECT CAST(x AS BIGINT) AS src FROM (VALUES"
-        " (0), (5)) t(x))",
-        "st0 AS{mat} (SELECT s.src, n.v, CAST(0 AS BIGINT) AS"
-        " p,\n"
-        "  CASE WHEN n.v = s.src THEN CAST(1099511627776 AS"
-        " BIGINT) ELSE CAST(0 AS BIGINT) END AS r\n"
-        " FROM nd n CROSS JOIN sc s)",
-    ]
-    for t in range(1, 9):
-        parts.append(
-            f"st{t} AS{{mat}} (SELECT a.src, a.v, a.p + a.r"
-            f" {{d}} 2 AS p,\n"
-            f"  coalesce(b.rin, CAST(0 AS BIGINT)) AS r\n"
-            f" FROM st{t-1} a LEFT JOIN (SELECT x.src, e.w AS"
-            f" v,\n"
-            f"    CAST(sum(x.r {{d}} 8) AS BIGINT) AS rin\n"
-            f"   FROM st{t-1} x JOIN ed e ON e.u = x.v\n"
-            f"   GROUP BY x.src, e.w) b\n"
-            f" ON b.src = a.src AND b.v = a.v)")
-    parts += [
-        "ms AS (SELECT src, CAST(sum(p) + sum(r) AS BIGINT) AS"
-        " mass,\n"
-        "        CAST(sum(r) AS BIGINT) AS rsum FROM st8 GROUP"
-        " BY src)",
-        "sy AS (SELECT CAST(a.p - b.p AS BIGINT) AS sym_viol\n"
-        "       FROM st8 a CROSS JOIN st8 b\n"
-        "       WHERE a.src = 0 AND a.v = 5 AND b.src = 5 AND"
-        " b.v = 0)",
-    ]
-    fin = (
-        "SELECT a.v, a.p AS ppr_scaled, a.r AS resid_scaled,\n"
-        "  m0.mass - 1099511627776 AS mass_viol0,\n"
-        "  m5.mass - 1099511627776 AS mass_viol5,\n"
-        "  m0.rsum - 4294967296 AS rdecay_viol,\n"
-        "  sy.sym_viol\n"
-        "FROM st8 a\n"
-        "JOIN ms m0 ON m0.src = 0 JOIN ms m5 ON m5.src = 5\n"
-        "CROSS JOIN sy\n"
-        "WHERE a.src = 0")
-    return parts, fin
-
-
-def _q739_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q739_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q739_ppr_push",
-       "WITH " + _q739_join("documents", "//", " MATERIALIZED"))
-def q739(spark, sf_dir):
-    """Personalized PageRank by SYNCHRONIZED push (Andersen-
-    Chung-Lang 2006 made round-synchronous per the sieve rule:
-    every node pushes simultaneously, so round t holds exactly
-    the truncated power series alpha * sum_{i<t}
-    ((1-alpha) W)^i e_s) — the local-graph-ranking primitive
-    behind seed-expansion community detection and
-    link-spam-neighborhood scoring on web graphs.  All
-    arithmetic is DYADIC-EXACT: alpha = 1/2 on a 4-regular
-    circulant (i +- 1, i +- 8 mod 64), residuals scaled by
-    2^40, each round dividing by 8 — integers throughout, no
-    float ever.  Three certificates: (1) mass conservation
-    sum(p) + sum(r) == 2^40 per source, exact; (2) geometric
-    residual decay sum(r_8) == 2^32 — the closed form of the
-    half-mass-per-round theorem; (3) the truncated-series
-    SYMMETRY p_T^(s)(v) == p_T^(v)(s), which holds iff W is
-    genuinely symmetric — two independent runs from sources 0
-    and 5 agreeing through 8 rounds of different intermediate
-    states.  Scale: each round is one equi-join + one grouped
-    sum (map-side combinable); both sources ride one state
-    table; rounds pin every second stage (engine) /
-    MATERIALIZED (oracle) per the reference-counting rule."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q739_documents")
-    parts, fin = _q739_sql("q739_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    dims = (frags["nd"] + ",\n" + frags["og"] + ",\n"
-            + frags["ed"] + ",\n" + frags["sc"])
-    # pin every second stage; odd stages inline as plain CTEs
-    _pin_view(spark, "WITH " + dims + "\n" + body("st0"),
-              "q739_st0", max_rows=256)
-    for t in (2, 4, 6, 8):
-        odd = frags[f"st{t-1}"].replace(f"st{t-2}",
-                                        f"q739_st{t-2}")
-        even = body(f"st{t}").replace(f"st{t-1}", f"st{t-1}")
-        _pin_view(spark,
-                  "WITH " + dims + ",\n" + odd + "\n" + even,
-                  f"q739_st{t}", max_rows=256)
-    fin_sql = (
-        "WITH ms AS (" + body("ms").replace("FROM st8",
-                                            "FROM q739_st8")
-        + "),\n"
-        "sy AS (" + body("sy").replace("st8 a", "q739_st8 a")
-        .replace("st8 b", "q739_st8 b") + ")\n"
-        + fin.replace("FROM st8 a", "FROM q739_st8 a"))
-    return spark.sql(fin_sql)
-
-
-# ---------------------------------------------------------------------------
-# q740: Walker/Vose alias method — the O(1) sampler certified by
-# exact integer reconstruction of the input distribution
-
-
-def _q740_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"kd AS (SELECT CAST(doc_id + 1 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 128)",
-        f"tk AS{{mat}} (SELECT\n"
-        f"           split_part(t.text, ' ', CAST(k.k AS INT))"
-        f" || ' ' ||\n"
-        f"           split_part(t.text, ' ', CAST(k.k AS INT) +"
-        f" 1) AS bg\n"
-        f"         FROM {tbl} t CROSS JOIN kd k\n"
-        f"         WHERE split_part(t.text, ' ', CAST(k.k AS"
-        f" INT) + 1) <> ''\n"
-        f"           AND split_part(t.text, ' ', CAST(k.k AS"
-        f" INT)) <> '')",
-        "wc AS{mat} (SELECT bg, CAST(count(*) AS BIGINT) AS c\n"
-        "         FROM tk GROUP BY bg)",
-        "tot AS (SELECT CAST(count(*) AS BIGINT) AS n_vocab,\n"
-        "           CAST(sum(c) AS BIGINT) AS big_w FROM wc)",
-        "tp AS (SELECT bg, c FROM (SELECT bg, c,\n"
-        "           row_number() OVER (ORDER BY c DESC, bg) AS"
-        " rnk\n"
-        "         FROM wc) z WHERE rnk <= 25)",
-    ]
-    fin = (
-        "SELECT t.bg, t.c, CAST(0 AS BIGINT) AS recon_viol,\n"
-        "       o.n_vocab, o.big_w,\n"
-        "       CAST(0 AS BIGINT) AS tot_viol\n"
-        "FROM tp t CROSS JOIN tot o")
-    return parts, fin
-
-
-def _q740_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q740_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q740_alias_method",
-       "WITH " + _q740_join("documents", "//", " MATERIALIZED"))
-def q740(spark, sf_dir):
-    """The Walker/Vose alias method (Walker 1977, Vose 1991) —
-    the O(1)-per-draw sampler every negative-sampling and
-    mixture-of-experts routing table is built on — constructed
-    over the REAL bigram distribution of the corpus and
-    certified by exact integer reconstruction.  Weights are
-    n-scaled (s_i = n * w_i against column height H = W, the
-    classic trick that keeps everything integral); the engine
-    runs the genuine two-worklist Vose construction (min-index
-    deterministic) and then RECONSTRUCTS each outcome's weight
-    relationally from the finished table: h_i plus the alias
-    parts H - h_j of every column pointing at i must equal
-    n * w_i EXACTLY — recon_viol == 0 per outcome and
-    tot_viol == 0 over the whole vocabulary.  The oracle
-    computes the distribution only and asserts the theorem
-    (a valid alias table reconstructs exactly); the comparator
-    enforcing engine-reconstruction == oracle-weights is the
-    proof the constructed table is correct.  Scale: the
-    construction is per-vocabulary-shard (hash-bucket the
-    vocabulary, one table per shard — each shard an
-    independent alias table over its conditional
-    distribution); the certificate is one groupBy join."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q740_documents")
-    parts, fin = _q740_sql("q740_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    # engine-native bigram tokenization (split once; identical
-    # values to the oracle's split_part enumeration — text is
-    # single-spaced, <= 128 words)
-    _ckpt_view(spark,
-               "SELECT bg, CAST(count(*) AS BIGINT) AS c FROM"
-               " (SELECT explode(CASE WHEN size(ws) >= 2 THEN"
-               " transform(sequence(1, size(ws) - 1),"
-               " i -> concat(ws[i-1], ' ', ws[i])) ELSE"
-               " array() END) AS bg FROM (SELECT"
-               " filter(split(text, ' '), x -> x <> '') AS ws"
-               " FROM q740_documents) z) y GROUP BY bg",
-               "q740_wc")
-    wdf = spark.table("q740_wc")
-    pdf = wdf.toPandas().sort_values("bg").reset_index(drop=True)
-    assert len(pdf) <= 4096, f"vocab {len(pdf)}"
-    import heapq
-    n = len(pdf)
-    big_h = int(pdf["c"].sum())
-    sv = [int(c) * n for c in pdf["c"]]
-    small = [i for i in range(n) if sv[i] < big_h]
-    large = [i for i in range(n) if sv[i] >= big_h]
-    heapq.heapify(small)
-    heapq.heapify(large)
-    h = [0] * n
-    al = [-1] * n
-    done = [False] * n
-    while small and large:
-        i = heapq.heappop(small)
-        j = large[0]
-        h[i] = sv[i]
-        al[i] = j
-        done[i] = True
-        sv[j] -= big_h - sv[i]
-        if sv[j] < big_h:
-            heapq.heappop(large)
-            heapq.heappush(small, j)
-    for j in list(large) + list(small):
-        if not done[j]:
-            h[j] = sv[j]
-            al[j] = -1
-            done[j] = True
-    tab = pd.DataFrame(
-        {"bg": pdf["bg"],
-         "h": pd.Series(h, dtype="int64"),
-         "aidx": pd.Series(al, dtype="int64"),
-         "idx": pd.Series(range(n), dtype="int64")})
-    spark.createDataFrame(tab).createOrReplaceTempView(
-        "q740_tab")
-
-    kept = [re.sub(r"\bwc\b", "q740_wc", frags[nm])
-            for nm in ("tot", "tp")]
-    fin_sql = (
-        "WITH " + ",\n       ".join(kept) + ",\n"
-        "rec AS (SELECT t.idx, t.bg, t.h +\n"
-        "           coalesce(a.part, 0) AS recon\n"
-        "         FROM q740_tab t LEFT JOIN\n"
-        "           (SELECT j.aidx AS idx, CAST(sum(o.big_w -"
-        " j.h) AS BIGINT) AS part\n"
-        "            FROM q740_tab j CROSS JOIN tot o\n"
-        "            WHERE j.aidx >= 0 GROUP BY j.aidx) a\n"
-        "           ON a.idx = t.idx),\n"
-        "rv AS (SELECT r.bg,\n"
-        "           r.recon - o.n_vocab * w.c AS viol\n"
-        "         FROM rec r JOIN q740_wc w ON w.bg = r.bg\n"
-        "         CROSS JOIN tot o),\n"
-        "tv AS (SELECT CAST(sum(abs(viol)) AS BIGINT) AS"
-        " tot_viol FROM rv)\n"
-        "SELECT t.bg, t.c, v.viol AS recon_viol,\n"
-        "       o.n_vocab, o.big_w, tv.tot_viol\n"
-        "FROM tp t JOIN rv v ON v.bg = t.bg\n"
-        "CROSS JOIN tot o CROSS JOIN tv")
-    return spark.sql(fin_sql)
-
-
-# ---------------------------------------------------------------------------
-# q741: Knuth-Plass optimal line breaking — Bellman DP over the
-# breakpoint DAG vs first-fit greedy, with disagreement witnesses
-
-
-def _q741_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"kd AS (SELECT CAST(doc_id + 1 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 40)",
-        f"wd AS (SELECT t.doc_id, k.k,\n"
-        f"           CAST(length(split_part(t.text, ' ',"
-        f" CAST(k.k AS INT))) AS BIGINT) AS wl\n"
-        f"         FROM {tbl} t CROSS JOIN kd k\n"
-        f"         WHERE t.doc_id < 8 AND split_part(t.text,"
-        f" ' ', CAST(k.k AS INT)) <> '')",
-        "pre AS{mat} (SELECT doc_id, k,\n"
-        "           sum(wl) OVER (PARTITION BY doc_id ORDER BY"
-        " k\n"
-        "             ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        " CURRENT ROW) AS cum\n"
-        "         FROM wd)",
-        "nw AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n\n"
-        "         FROM wd GROUP BY doc_id)",
-        # breakpoint nodes 0..n; cum0 lookup with node 0 = 0
-        f"nde AS (SELECT w.doc_id, CAST(x.k - 1 AS BIGINT) AS"
-        f" v,\n"
-        f"           coalesce(p.cum, 0) AS cum, w.n\n"
-        f"         FROM nw w JOIN (SELECT CAST(doc_id + 1 AS"
-        f" BIGINT) AS k\n"
-        f"             FROM {tbl} WHERE doc_id < 41) x\n"
-        f"           ON x.k - 1 <= w.n\n"
-        f"         LEFT JOIN pre p ON p.doc_id = w.doc_id AND"
-        f" p.k = x.k - 1)",
-        # feasible lines (i, j]: words i+1..j + inter-word
-        # spaces fit in L = 44; last line costs 0, others the
-        # squared slack — Knuth-Plass badness
-        "ed AS{mat} (SELECT a.doc_id, a.v AS u, b.v,\n"
-        "           CASE WHEN b.v = a.n THEN CAST(0 AS"
-        " BIGINT)\n"
-        "                ELSE (44 - (b.cum - a.cum + b.v - a.v"
-        " - 1)) *\n"
-        "                     (44 - (b.cum - a.cum + b.v - a.v"
-        " - 1)) END AS cost\n"
-        "         FROM nde a JOIN nde b ON b.doc_id ="
-        " a.doc_id\n"
-        "           AND b.v > a.v\n"
-        "           AND b.cum - a.cum + b.v - a.v - 1 <= 44)",
-        # zero-cost self-loops make each relaxation a SINGLE
-        # reference to its predecessor (join + grouped min) —
-        # the q709 double-reference plan explosion designed out
-        "ed2 AS{mat} (SELECT doc_id, u, v, cost FROM ed\n"
-        "         UNION ALL\n"
-        "         SELECT doc_id, v AS u, v, CAST(0 AS BIGINT)"
-        " AS cost FROM nde)",
-        "bl0 AS{mat} (SELECT doc_id, v, CASE WHEN v = 0 THEN"
-        " CAST(0 AS BIGINT)\n"
-        "           ELSE CAST(1000000000000000 AS BIGINT) END"
-        " AS dist\n"
-        "         FROM nde)",
-    ]
-    for t in range(1, 13):
-        parts.append(
-            f"bl{t} AS{{mat}} (SELECT e.doc_id, e.v,\n"
-            f"           CAST(min(x.dist + e.cost) AS BIGINT)"
-            f" AS dist\n"
-            f"         FROM bl{t-1} x JOIN ed2 e ON e.doc_id"
-            f" = x.doc_id AND e.u = x.v\n"
-            f"         GROUP BY e.doc_id, e.v)")
-    parts += [
-        # fixpoint certificate: one more relaxation changes
-        # nothing
-        "fx AS (SELECT CAST(sum(CASE WHEN a.dist <> b.dist"
-        " THEN 1 ELSE 0 END)\n"
-        "           AS BIGINT) AS fixpoint_resid\n"
-        "         FROM bl12 a JOIN bl11 b ON b.doc_id ="
-        " a.doc_id AND b.v = a.v)",
-        # first-fit greedy: from each node the FARTHEST feasible
-        # break
-        "gn AS{mat} (SELECT e.doc_id, e.u, max(e.v) AS nxt\n"
-        "         FROM ed e GROUP BY e.doc_id, e.u)",
-        "gc AS (SELECT g.doc_id, g.u, g.nxt, e.cost\n"
-        "         FROM gn g JOIN ed e ON e.doc_id = g.doc_id\n"
-        "           AND e.u = g.u AND e.v = g.nxt)",
-        # greedy walk (oracle: recursion; engine: pandas)
-        "gw AS (SELECT doc_id, CAST(0 AS BIGINT) AS pos,\n"
-        "           CAST(0 AS BIGINT) AS bad, CAST(0 AS"
-        " BIGINT) AS lines, n\n"
-        "         FROM nw\n"
-        "         UNION ALL\n"
-        "         SELECT w.doc_id, c.nxt, w.bad + c.cost,\n"
-        "           w.lines + 1, w.n\n"
-        "         FROM gw w JOIN gc c ON c.doc_id = w.doc_id\n"
-        "           AND c.u = w.pos\n"
-        "         WHERE w.pos < w.n)",
-        "gr AS (SELECT doc_id, max(bad) AS greedy_badness,\n"
-        "           max(lines) AS greedy_lines\n"
-        "         FROM gw WHERE pos = n GROUP BY doc_id)",
-    ]
-    fin = (
-        "SELECT w.doc_id, w.n AS n_words,\n"
-        "       b.dist AS opt_badness, g.greedy_badness,\n"
-        "       g.greedy_lines,\n"
-        "       g.greedy_badness - b.dist AS gap,\n"
-        "       CASE WHEN b.dist <= g.greedy_badness THEN 1"
-        " ELSE 0 END AS opt_le_greedy,\n"
-        "       f.fixpoint_resid\n"
-        "FROM nw w JOIN bl12 b ON b.doc_id = w.doc_id AND b.v"
-        " = w.n\n"
-        "JOIN gr g ON g.doc_id = w.doc_id\n"
-        "CROSS JOIN fx f")
-    return parts, fin
-
-
-def _q741_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q741_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q741_knuth_plass",
-       "WITH RECURSIVE " + _q741_join("documents", "//",
-                                      " MATERIALIZED"))
-def q741(spark, sf_dir):
-    """Knuth-Plass optimal line breaking (Knuth-Plass 1981 —
-    TeX's paragraph layout, and the shape of every snippet /
-    KWIC wrapping pass a SERP renders) as a relational Bellman
-    DP over the breakpoint DAG, against first-fit greedy with
-    a planted-free DISAGREEMENT WITNESS from real data.  Nodes
-    are breakpoints 0..n over the first 40 words of 8 real
-    documents; a feasible line (i, j] must fit width 44
-    (prefix-sum widths + inter-word spaces); its badness is
-    the squared slack, last line free — the classical
-    objective.  Optimal = 12 round-synchronous relaxation
-    stages (monotone, so stages are idempotent past
-    convergence; fixpoint_resid == 0 certifies stage 12 ==
-    stage 11, i.e. the DP genuinely converged, not ran out of
-    budget).  Greedy = the farthest-feasible-break walk.  The
-    certificates: opt_le_greedy == 1 on every document (DP
-    dominance) and gap > 0 on one real document per SF — greedy's 'pack
-    this line fullest' leaves a ragged line later, the exact
-    phenomenon Knuth-Plass exists to fix, arising from real
-    text with no planting.  Scale: edges are a bounded-fanout
-    self-join; each relaxation is one equi-join + grouped min
-    (map-side combinable); the greedy walk is the per-entity
-    recurrence template (engine pandas, oracle recursion)."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q741_documents")
-    parts, fin = _q741_sql("q741_documents", "div", "")
-    frags = {}
-    order = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        frags[nm] = fr
-        order.append(nm)
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    dims = ",\n".join(frags[n] for n in
-                      ("kd", "wd", "pre", "nw", "nde"))
-    _pin_view(spark, "WITH " + dims + "\n" + body("ed"),
-              "q741_ed", max_rows=8192)
-    _pin_view(spark, "WITH " + dims + ",\n"
-              + frags["ed"].replace("ed AS", "ed AS") + "\n"
-              + body("ed2").replace("FROM ed", "FROM ed"),
-              "q741_ed2", max_rows=8192)
-    _pin_view(spark, "WITH " + dims + "\n" + body("bl0"),
-              "q741_bl0", max_rows=512)
-    # relaxation stages: single-reference linear chain over the
-    # pinned self-looped edge table — one SQL, no per-stage pins
-    chain = []
-    for t in range(1, 12):
-        st = frags[f"bl{t}"].replace(" ed2 e", " q741_ed2 e")
-        if t == 1:
-            st = st.replace("bl0 x", "q741_bl0 x")
-        chain.append(st)
-    _pin_view(spark,
-              "WITH " + ",\n".join(chain) + "\n"
-              + body("bl12").replace(" ed2 e", " q741_ed2 e"),
-              "q741_bl12", max_rows=512)
-    _pin_view(spark,
-              "WITH " + ",\n".join(chain[:-1]) + "\n"
-              + body("bl11").replace(" ed2 e", " q741_ed2 e"),
-              "q741_bl11", max_rows=512)
-    _pin_view(spark, "WITH gn0 AS (" + body("gn")
-              .replace(" ed e", " q741_ed e") + ")"
-              "\nSELECT * FROM gn0",
-              "q741_gn", max_rows=512)
-
-    def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("u")
-        did = int(pdf["doc_id"].iloc[0])
-        n = int(pdf["n"].iloc[0])
-        nxt = dict(zip(pdf["u"], pdf["nxt"]))
-        cst = dict(zip(pdf["u"], pdf["cost"]))
-        pos, bad, lines = 0, 0, 0
-        while pos < n:
-            bad += int(cst[pos])
-            pos = int(nxt[pos])
-            lines += 1
-        return pd.DataFrame(
-            {"doc_id": [did], "greedy_badness": [bad],
-             "greedy_lines": [lines]})
-
-    gc_sql = ("SELECT g.doc_id, g.u, g.nxt, e.cost, w.n\n"
-              "FROM q741_gn g JOIN q741_ed e ON e.doc_id ="
-              " g.doc_id\n"
-              "  AND e.u = g.u AND e.v = g.nxt\n"
-              "JOIN (SELECT doc_id, max(v) AS n FROM q741_bl0"
-              " GROUP BY doc_id) w\n"
-              "  ON w.doc_id = g.doc_id")
-    spark.sql(gc_sql).groupBy("doc_id").applyInPandas(
-        _greedy,
-        "doc_id long, greedy_badness long, greedy_lines long") \
-        .createOrReplaceTempView("q741_gr")
-
-    fin_sql = (
-        "WITH " + dims + ",\n"
-        "fx AS (" + body("fx").replace("bl12 a", "q741_bl12 a")
-        .replace("bl11 b", "q741_bl11 b") + ")\n"
-        + fin.replace("JOIN bl12 b", "JOIN q741_bl12 b")
-        .replace("JOIN gr g", "JOIN q741_gr g"))
-    return spark.sql(fin_sql)
-
-
-# ---------------------------------------------------------------------------
-# q742: MaxScore pruning — the essential/non-essential term split
-# certified safe against exhaustive top-k on real postings
-
-
-def _q742_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"kd AS (SELECT CAST(doc_id + 1 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 128)",
-        f"tk AS{{mat}} (SELECT t.doc_id,\n"
-        f"        split_part(t.text, ' ', CAST(k.k AS INT)) ||"
-        f" ' ' ||\n"
-        f"        split_part(t.text, ' ', CAST(k.k AS INT) + 1)"
-        f" AS bg\n"
-        f"       FROM {tbl} t CROSS JOIN kd k\n"
-        f"       WHERE split_part(t.text, ' ', CAST(k.k AS INT)"
-        f" + 1) <> ''\n"
-        f"         AND split_part(t.text, ' ', CAST(k.k AS INT))"
-        f" <> '')",
-        "pst AS{mat} (SELECT doc_id, bg, CAST(count(*) AS"
-        " BIGINT) AS tf\n"
-        "       FROM tk GROUP BY doc_id, bg)",
-        "voc AS (SELECT bg, CAST(count(*) AS BIGINT) AS df,\n"
-        "          row_number() OVER (ORDER BY sum(tf) DESC,"
-        " bg) AS rnk\n"
-        "        FROM pst GROUP BY bg)",
-        # 6-term query drawn across the collection-frequency
-        # spectrum; integer idf-ish weights
-        "qt AS (SELECT bg, df, rnk, 1024 {d} df AS w FROM voc\n"
-        "        WHERE rnk IN (5, 20, 50, 100, 200, 300))",
-        "ip AS{mat} (SELECT p.doc_id, q.bg, p.tf * q.w AS imp\n"
-        "        FROM pst p JOIN qt q ON q.bg = p.bg)",
-        "ub AS (SELECT bg, CAST(max(imp) AS BIGINT) AS ub FROM"
-        " ip GROUP BY bg)",
-        "cand AS (SELECT doc_id, CAST(sum(imp) AS BIGINT) AS"
-        " score\n"
-        "        FROM ip GROUP BY doc_id)",
-        "topk AS (SELECT doc_id, score FROM (SELECT doc_id,"
-        " score,\n"
-        "          row_number() OVER (ORDER BY score DESC,"
-        " doc_id) AS rk\n"
-        "          FROM cand) z WHERE rk <= 10)",
-        "th AS (SELECT min(score) AS theta FROM topk)",
-        # MaxScore split: terms in ascending-UB order; the
-        # maximal prefix whose cumulative UB stays under theta
-        # is non-essential
-        "ord2 AS (SELECT u.bg, u.ub, CAST(sum(u2.ub) AS"
-        " BIGINT) AS cum\n"
-        "         FROM ub u JOIN ub u2 ON u2.ub < u.ub OR"
-        " (u2.ub = u.ub AND u2.bg <= u.bg)\n"
-        "         GROUP BY u.bg, u.ub)",
-        "ess AS (SELECT o.bg, CASE WHEN o.cum < t.theta THEN 0"
-        " ELSE 1 END AS essential\n"
-        "        FROM ord2 o CROSS JOIN th t)",
-        # skippable candidates: touch no essential term
-        "skp AS (SELECT c.doc_id FROM cand c WHERE NOT EXISTS\n"
-        "          (SELECT 1 FROM ip i JOIN ess e ON e.bg ="
-        " i.bg\n"
-        "           WHERE i.doc_id = c.doc_id AND e.essential"
-        " = 1))",
-        "ct AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM topk t JOIN"
-        " skp s ON s.doc_id = t.doc_id) AS topk_skipped,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM skp) AS"
-        " n_skippable,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM cand) AS"
-        " n_cand,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM ess WHERE"
-        " essential = 0) AS n_noness,\n"
-        "   (SELECT CAST(theta AS BIGINT) FROM th) AS theta)",
-    ]
-    fin = (
-        "SELECT t.doc_id, t.score, c.topk_skipped,\n"
-        "       c.n_skippable, c.n_cand, c.n_noness, c.theta\n"
-        "FROM topk t CROSS JOIN ct c")
-    return parts, fin
-
-
-def _q742_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q742_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q742_maxscore_pruning",
-       "WITH " + _q742_join("documents", "//", " MATERIALIZED"))
-def q742(spark, sf_dir):
-    """MaxScore pruning (Turtle-Flood 1995 — with WAND (q298)
-    one of the two dominant safe dynamic-pruning families in
-    every production inverted index) certified SAFE against
-    exhaustive scoring on real bigram postings.  Postings are
-    per-(doc, bigram) term frequencies with integer idf-style
-    weights; a 6-term query spans the collection-frequency
-    spectrum.  The split: sort query terms by upper bound
-    (their maximum impact); the maximal ascending prefix whose
-    cumulative UB stays below theta (the exact 10th-best
-    score) is NON-ESSENTIAL — the theorem is that a document
-    touching only non-essential terms can never enter the
-    top k, because its score is bounded by the prefix's UB
-    sum.  Certified: the skippable set (candidates with no
-    essential postings — 17 docs at sf0.001, real savings) has
-    EMPTY intersection with the exhaustive top 10
-    (topk_skipped == 0), with the split sizes and theta
-    emitted.  Scale: this is the static form of the pruning
-    that lets a DAAT traversal skip the long tail of cheap
-    postings lists; every piece here is a grouped aggregate or
-    bounded top-k — no traversal state."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q742_documents")
-    parts, fin = _q742_sql("q742_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    # engine-native per-doc bigram tf (split once; values match
-    # the oracle's split_part enumeration on this corpus)
-    _ckpt_view(spark,
-               "SELECT doc_id, bg, CAST(count(*) AS BIGINT) AS"
-               " tf FROM (SELECT doc_id, explode(CASE WHEN"
-               " size(ws) >= 2 THEN transform(sequence(1,"
-               " size(ws) - 1), i -> concat(ws[i-1], ' ',"
-               " ws[i])) ELSE array() END) AS bg FROM (SELECT"
-               " doc_id, filter(split(text, ' '), x -> x <> '')"
-               " AS ws FROM q742_documents) z) y GROUP BY"
-               " doc_id, bg", "q742_pst")
-    _ckpt_view(spark,
-               "WITH " + frags["voc"].replace("FROM pst",
-                                              "FROM q742_pst")
-               + ",\n" + frags["qt"] + "\n"
-               + body("ip").replace("FROM pst p",
-                                    "FROM q742_pst p"),
-               "q742_ip")
-
-    def _sub(text):
-        return re.sub(r"\bip\b", "q742_ip", text)
-    kept = [_sub(frags[n]) for n in
-            ("ub", "cand", "topk", "th", "ord2", "ess", "skp",
-             "ct")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
 
 
 # ---------------------------------------------------------------------------
@@ -65483,7 +11930,7 @@ def _q743_join(tbl: str, d: str, mat: str) -> str:
 
 
 @query("q743_hilbert_continuity",
-       "WITH " + _q743_join("documents", "//", " MATERIALIZED"))
+       "WITH " + _q743_join("documents", "//", " MATERIALIZED"), kind="operator")
 def q743(spark, sf_dir):
     """The Hilbert curve's defining theorems — CONTINUITY and
     BIJECTIVITY — certified over the full 32 x 32 grid, with
@@ -65538,5318 +11985,6 @@ def q743(spark, sf_dir):
     kept = [_sub(frags[n]) for n in ("aj", "bj", "qd", "cn")]
     return spark.sql("WITH " + ",\n       ".join(kept)
                      + "\n" + _sub(fin))
-
-
-# ---------------------------------------------------------------------------
-# q744: Chiu-Jain AIMD fairness — the control law that converges,
-# beside the two that provably don't, as 16 exact integer rounds
-
-
-def _q744_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 6 flow pairs: 4 AIMD (dyn 0), 1 AIAD (dyn 1),
-        # 1 MIMD (dyn 2); capacity C = 8
-        f"fp AS (SELECT CAST(doc_id AS BIGINT) AS pid,\n"
-        f"   CASE doc_id WHEN 0 THEN 0 WHEN 1 THEN 0 WHEN 2"
-        f" THEN 0\n"
-        f"        WHEN 3 THEN 0 WHEN 4 THEN 1 ELSE 2 END AS"
-        f" dyn,\n"
-        f"   CASE doc_id WHEN 0 THEN 6 WHEN 1 THEN 7 WHEN 2"
-        f" THEN 5\n"
-        f"        WHEN 3 THEN 8 WHEN 4 THEN 7 ELSE 8 END AS"
-        f" x1,\n"
-        f"   CASE doc_id WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2"
-        f" THEN 4\n"
-        f"        WHEN 3 THEN 8 WHEN 4 THEN 3 ELSE 2 END AS"
-        f" x2\n"
-        f"  FROM {tbl} WHERE doc_id < 6)",
-        "rd0 AS{mat} (SELECT pid, dyn, CAST(x1 AS BIGINT) AS"
-        " x1,\n"
-        "   CAST(x2 AS BIGINT) AS x2 FROM fp)",
-    ]
-    for t in range(1, 17):
-        parts.append(
-            f"rd{t} AS{{mat}} (SELECT pid, dyn,\n"
-            f"   CASE WHEN x1 + x2 > 8 THEN\n"
-            f"     CASE dyn WHEN 0 THEN x1 {{d}} 2 WHEN 1 THEN"
-            f" x1 - 2 ELSE x1 {{d}} 2 END\n"
-            f"   ELSE CASE dyn WHEN 2 THEN x1 * 2 ELSE x1 + 1"
-            f" END END AS x1,\n"
-            f"   CASE WHEN x1 + x2 > 8 THEN\n"
-            f"     CASE dyn WHEN 0 THEN x2 {{d}} 2 WHEN 1 THEN"
-            f" x2 - 2 ELSE x2 {{d}} 2 END\n"
-            f"   ELSE CASE dyn WHEN 2 THEN x2 * 2 ELSE x2 + 1"
-            f" END END AS x2\n"
-            f" FROM rd{t-1})")
-    parts += [
-        # periodic-orbit certificates at the per-dynamics
-        # period: AIMD 4, AIAD 3, MIMD 2
-        "cy AS (SELECT CAST(sum(CASE WHEN a.dyn = 0 AND\n"
-        "   (a.x1 <> b.x1 OR a.x2 <> b.x2) THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS aimd_cycle_viol\n"
-        "  FROM rd16 a JOIN rd12 b ON b.pid = a.pid)",
-        "cy3 AS (SELECT CAST(sum(CASE WHEN a.dyn = 1 AND\n"
-        "   (a.x1 <> b.x1 OR a.x2 <> b.x2) THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS aiad_cycle_viol\n"
-        "  FROM rd16 a JOIN rd13 b ON b.pid = a.pid)",
-        "cy2 AS (SELECT CAST(sum(CASE WHEN a.dyn = 2 AND\n"
-        "   (a.x1 <> b.x1 OR a.x2 <> b.x2) THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS mimd_cycle_viol\n"
-        "  FROM rd16 a JOIN rd14 b ON b.pid = a.pid)",
-    ]
-    fin = (
-        "SELECT a.pid, a.dyn, f.x1 AS x1_0, f.x2 AS x2_0,\n"
-        "  a.x1 AS x1_16, a.x2 AS x2_16,\n"
-        "  abs(a.x1 - a.x2) AS final_gap,\n"
-        "  abs(f.x1 - f.x2) AS initial_gap,\n"
-        "  c4.aimd_cycle_viol, c3.aiad_cycle_viol,\n"
-        "  c2.mimd_cycle_viol\n"
-        "FROM rd16 a JOIN fp f ON f.pid = a.pid\n"
-        "CROSS JOIN cy c4 CROSS JOIN cy3 c3 CROSS JOIN cy2"
-        " c2")
-    return parts, fin
-
-
-def _q744_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q744_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q744_aimd_fairness",
-       "WITH " + _q744_join("documents", "//", " MATERIALIZED"))
-def q744(spark, sf_dir):
-    """Chiu-Jain convergence (Chiu-Jain 1989 — why TCP and
-    every polite crawler's rate controller use ADDITIVE
-    increase with MULTIPLICATIVE decrease): 16 exact integer
-    rounds of three control laws sharing one capacity C = 8,
-    with fairness convergence and its two classical failures
-    side by side.  AIMD pairs starting as far apart as (6, 1)
-    all reach final_gap == 0 — halving cuts the gap while +1
-    preserves it, so each congestion epoch shrinks unfairness
-    geometrically; AIAD (additive decrease) preserves the gap
-    FOREVER (final_gap == initial_gap == 4 — the difference is
-    an invariant of +-constant dynamics); MIMD preserves the
-    RATIO forever (8:2 = 4:1 at every round).  All three
-    settle into exact periodic orbits, certified at their
-    measured periods (AIMD 4, AIAD 3, MIMD 2; round 16 equals
-    round 16-p elementwise, zero violations).  Engine: 16
-    per-row CASE stages — each stage references its
-    predecessor's columns multiply, so the engine runs them as
-    MATERIALIZED-equivalent pinned stages rather than letting
-    CollapseProject build a 2^16 expression tree; oracle:
-    MATERIALIZED CTE rounds.  Scale: state is one row per
-    flow pair; rounds are embarrassingly parallel across
-    pairs."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q744_documents")
-    parts, fin = _q744_sql("q744_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    # batch 4 rounds per pin: inner chain is linear and the
-    # per-round expression only doubles within the batch
-    _pin_view(spark, "WITH " + frags["fp"] + "\n" + body("rd0"),
-              "q744_rd0", max_rows=16)
-    for base in (4, 8, 12, 16):
-        chain = []
-        for t in range(base - 3, base):
-            st = frags[f"rd{t}"]
-            if t == base - 3:
-                st = st.replace(f"FROM rd{t-1}",
-                                f"FROM q744_rd{t-1}")
-            chain.append(st)
-        _pin_view(spark, "WITH " + ",\n".join(chain) + "\n"
-                  + body(f"rd{base}").replace(
-                      f"FROM rd{base-1}", f"FROM rd{base-1}"),
-                  f"q744_rd{base}", max_rows=16)
-    # rd13 / rd14 for the AIAD / MIMD period checks
-    for t in (13, 14):
-        chain = []
-        for u in range(13, t):
-            chain.append(frags[f"rd{u}"].replace(
-                "FROM rd12", "FROM q744_rd12"))
-        bb = body(f"rd{t}")
-        bb = bb.replace(f"FROM rd{t-1}",
-                        f"FROM q744_rd{t-1}" if t == 13
-                        else f"FROM rd{t-1}")
-        if t == 14:
-            bb = bb.replace("FROM rd13", "FROM rd13")
-        _pin_view(spark, ("WITH " + ",\n".join(chain) + "\n"
-                          if chain else "") + bb,
-                  f"q744_rd{t}", max_rows=16)
-
-    def _sub(text):
-        for nm in ("rd16", "rd14", "rd13", "rd12", "fp"):
-            text = re.sub(rf"\b{nm}\b", f"q744_{nm}", text)
-        return text
-    spark.sql("SELECT pid, dyn, x1, x2 FROM q744_rd0") \
-        .createOrReplaceTempView("q744_fp")
-    kept = [_sub(frags[n]) for n in ("cy", "cy3", "cy2")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _sub(fin))
-
-
-# ---------------------------------------------------------------------------
-# q745: rate-monotonic schedulability — exact time-demand analysis
-# against the Liu-Layland bound, compared in exact integer cubes
-
-
-def _q745_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 4 task sets x 3 tasks (rate-monotonic priority =
-        # ascending period):
-        # A harmonic U=1 (schedulable above the bound),
-        # B light U=7/16 (below the bound -> guaranteed),
-        # C overloaded U=19/16, D the classic U=59/60 miss
-        f"ts AS (SELECT CAST(doc_id {{d}} 3 AS BIGINT) AS sid,\n"
-        f"   CAST(doc_id % 3 AS BIGINT) AS tid,\n"
-        f"   CASE doc_id WHEN 0 THEN 2 WHEN 1 THEN 2 WHEN 2"
-        f" THEN 4\n"
-        f"        WHEN 3 THEN 1 WHEN 4 THEN 1 WHEN 5 THEN 1\n"
-        f"        WHEN 6 THEN 2 WHEN 7 THEN 3 WHEN 8 THEN 5\n"
-        f"        WHEN 9 THEN 1 WHEN 10 THEN 1 ELSE 2 END AS"
-        f" c,\n"
-        f"   CASE doc_id WHEN 0 THEN 4 WHEN 1 THEN 8 WHEN 2"
-        f" THEN 16\n"
-        f"        WHEN 3 THEN 4 WHEN 4 THEN 8 WHEN 5 THEN 16\n"
-        f"        WHEN 6 THEN 4 WHEN 7 THEN 8 WHEN 8 THEN 16\n"
-        f"        WHEN 9 THEN 3 WHEN 10 THEN 4 ELSE 5 END AS"
-        f" t\n"
-        f"  FROM {tbl} WHERE doc_id < 12)",
-        "w0 AS{mat} (SELECT sid, tid, c, t, c AS w FROM ts)",
-    ]
-    for it in range(1, 7):
-        parts.append(
-            f"w{it} AS{{mat}} (SELECT a.sid, a.tid, a.c, a.t,\n"
-            f"   a.c + coalesce(h.intf, 0) AS w\n"
-            f" FROM w{it-1} a LEFT JOIN\n"
-            f"   (SELECT x.sid, x.tid, CAST(sum(((x.w + j.t -"
-            f" 1) {{d}} j.t) * j.c)\n"
-            f"       AS BIGINT) AS intf\n"
-            f"    FROM w{it-1} x JOIN ts j ON j.sid = x.sid"
-            f" AND j.tid < x.tid\n"
-            f"    GROUP BY x.sid, x.tid) h\n"
-            f"   ON h.sid = a.sid AND h.tid = a.tid)")
-    parts += [
-        "fx AS (SELECT CAST(sum(CASE WHEN a.w <> b.w AND a.w"
-        " <= a.t\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS fixpoint_resid\n"
-        "  FROM w6 a JOIN w5 b ON b.sid = a.sid AND b.tid ="
-        " a.tid)",
-        # utilization as an exact fraction over lcm-free
-        # cross-multiplication; Liu-Layland n=3 bound compared
-        # by CUBING: U > 3(2^(1/3)-1)  <=>  (Un + 3)^3 > 54 Ud^3
-        # with n = 3 folded in (Un/Ud = U)
-        "ut AS (SELECT sid,\n"
-        "   CAST(sum(c * (3840 {d} t)) AS BIGINT) AS un,\n"
-        "   CAST(3840 AS BIGINT) AS ud\n"
-        "  FROM ts GROUP BY sid)",
-        "ll AS (SELECT sid, un, ud,\n"
-        "   CASE WHEN (un + 3 * ud) * (un + 3 * ud) * (un + 3"
-        " * ud) >\n"
-        "     54 * ud * ud * ud THEN 1 ELSE 0 END AS"
-        " above_ll\n"
-        "  FROM ut)",
-        "vd AS (SELECT sid,\n"
-        "   CAST(min(CASE WHEN w <= t THEN 1 ELSE 0 END) AS"
-        " BIGINT) AS schedulable\n"
-        "  FROM w6 GROUP BY sid)",
-    ]
-    fin = (
-        "SELECT a.sid, a.tid, a.c, a.t, a.w,\n"
-        "  CASE WHEN a.w <= a.t THEN 1 ELSE 0 END AS"
-        " task_ok,\n"
-        "  v.schedulable, l.above_ll, l.un, l.ud,\n"
-        "  f.fixpoint_resid\n"
-        "FROM w6 a JOIN vd v ON v.sid = a.sid\n"
-        "JOIN ll l ON l.sid = a.sid\n"
-        "CROSS JOIN fx f")
-    return parts, fin
-
-
-def _q745_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q745_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q745_rate_monotonic",
-       "WITH " + _q745_join("documents", "//", " MATERIALIZED"))
-def q745(spark, sf_dir):
-    """Rate-monotonic schedulability (Liu-Layland 1973 +
-    Lehoczky's exact time-demand analysis — the admission
-    test under every real-time executor and, in spirit, every
-    rate-limited crawler shard assigning periodic fetch
-    budgets).  Four 3-task sets run 6 fixpoint iterations of
-    the TDA recurrence W = C_i + sum_{j higher} ceil(W/T_j)
-    C_j (integer ceiling division), fixpoint certified
-    (stage 6 == stage 5 on every converged task).  The
-    Liu-Layland bound 3(2^(1/3) - 1) is IRRATIONAL — the
-    query compares utilization to it EXACTLY by cubing:
-    U > bound  <=>  (Un + 3 Ud)^3 > 54 Ud^3, pure BIGINT.
-    The four verdicts tell the whole classical story: the
-    harmonic set at U = 1 is schedulable ABOVE the bound
-    (sufficiency is not necessity); the light set below the
-    bound is schedulable (the theorem); the U = 19/16 set
-    blows its deadline (w > T certified by monotone demand);
-    and the classic (1,3)(1,4)(2,5) set at U = 59/60 < 1
-    misses — utilization alone cannot admit under RM.  Scale:
-    each iteration is one bounded join + grouped sum over the
-    task dim; everything else is exact integer arithmetic."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q745_documents")
-    parts, fin = _q745_sql("q745_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _pin_view(spark, "WITH " + frags["ts"] + "\n" + body("w0"),
-              "q745_w0", max_rows=16)
-    # each TDA stage references its predecessor twice (direct +
-    # interference subquery): pin every stage pair
-    for base in (2, 4, 6):
-        odd = frags[f"w{base-1}"].replace(
-            f"w{base-2} a", f"q745_w{base-2} a").replace(
-            f"w{base-2} x", f"q745_w{base-2} x")
-        _pin_view(spark,
-                  "WITH " + frags["ts"] + ",\n" + odd + "\n"
-                  + body(f"w{base}"),
-                  f"q745_w{base}", max_rows=16)
-    odd5 = frags["w5"].replace("w4 a", "q745_w4 a") \
-                      .replace("w4 x", "q745_w4 x")
-    _pin_view(spark, "WITH " + frags["ts"] + ",\n"
-              + odd5.split(" AS ", 1)[0] + " AS "
-              + odd5.split(" AS ", 1)[1] + "\nSELECT * FROM w5",
-              "q745_w5", max_rows=16)
-
-    def _sub(text):
-        for nm in ("w6", "w5"):
-            text = re.sub(rf"\b{nm}\b", f"q745_{nm}", text)
-        return text
-    kept = [frags["ts"], _sub(frags["fx"]), frags["ut"],
-            frags["ll"], _sub(frags["vd"])]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _sub(fin))
-
-
-# ---------------------------------------------------------------------------
-# q746: cuckoo hashing feasibility — the component deficiency
-# formula certified against a real maximum matching
-
-
-def _q746_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 48 keys, 64 buckets, two hash choices; keys 45-47 all
-        # map to buckets {60, 61}: a planted 3-edges-2-vertices
-        # infeasible component
-        f"ky AS (SELECT CAST(doc_id AS BIGINT) AS k,\n"
-        f"   CASE WHEN doc_id >= 45 THEN 60 ELSE"
-        f" (CAST(doc_id AS BIGINT) * 31 + 7) % 64 END AS h1,\n"
-        f"   CASE WHEN doc_id >= 45 THEN 61 ELSE"
-        f" (CAST(doc_id AS BIGINT) * 53 + 11) % 64 END AS h2\n"
-        f"  FROM {tbl} WHERE doc_id < 48)",
-        "tv AS (SELECT DISTINCT b FROM (SELECT h1 AS b FROM ky\n"
-        "   UNION ALL SELECT h2 FROM ky) z)",
-        # symmetric bucket-graph edges + self-loops (the q741
-        # single-reference trick for min-label rounds)
-        "eg AS{mat} (SELECT h1 AS u, h2 AS v FROM ky\n"
-        "   UNION ALL SELECT h2, h1 FROM ky\n"
-        "   UNION ALL SELECT b, b FROM tv)",
-        "lb0 AS{mat} (SELECT b, b AS lbl FROM tv)",
-    ]
-    for t in range(1, 7):
-        parts.append(
-            f"lb{t} AS{{mat}} (SELECT e.v AS b, min(x.lbl) AS"
-            f" lbl\n"
-            f"  FROM lb{t-1} x JOIN eg e ON e.u = x.b\n"
-            f"  GROUP BY e.v)")
-    parts += [
-        "fx AS (SELECT CAST(sum(CASE WHEN a.lbl <> b.lbl THEN"
-        " 1 ELSE 0 END)\n"
-        "   AS BIGINT) AS fixpoint_resid\n"
-        "  FROM lb6 a JOIN lb5 b ON b.b = a.b)",
-        "ce AS (SELECT l.lbl, CAST(count(*) AS BIGINT) AS"
-        " n_keys\n"
-        "  FROM ky k JOIN lb6 l ON l.b = k.h1 GROUP BY l.lbl)",
-        "cv AS (SELECT lbl, CAST(count(*) AS BIGINT) AS"
-        " n_buckets FROM lb6 GROUP BY lbl)",
-        "cm AS (SELECT e.lbl, e.n_keys, v.n_buckets,\n"
-        "   CASE WHEN e.n_keys <= v.n_buckets THEN 1 ELSE 0"
-        " END AS feasible,\n"
-        "   least(e.n_keys, v.n_buckets) AS placeable\n"
-        "  FROM ce e JOIN cv v ON v.lbl = e.lbl)",
-        "gl AS (SELECT CAST(sum(placeable) AS BIGINT) AS"
-        " total_placeable,\n"
-        "   CAST(sum(1 - feasible) AS BIGINT) AS"
-        " n_infeasible\n"
-        "  FROM cm)",
-        "mt AS (SELECT g.total_placeable AS match_size FROM"
-        " gl g)",
-    ]
-    fin = (
-        "SELECT c.lbl, c.n_keys, c.n_buckets, c.feasible,\n"
-        "  c.placeable, g.total_placeable, m.match_size,\n"
-        "  g.n_infeasible, f.fixpoint_resid\n"
-        "FROM cm c CROSS JOIN gl g CROSS JOIN mt m\n"
-        "CROSS JOIN fx f")
-    return parts, fin
-
-
-def _q746_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q746_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q746_cuckoo_feasibility",
-       "WITH " + _q746_join("documents", "//", " MATERIALIZED"))
-def q746(spark, sf_dir):
-    """Cuckoo hashing feasibility (Pagh-Rodler 2001) decided
-    STRUCTURALLY and certified against a real maximum
-    matching — the two-choice table that backs high-load-
-    factor dedup fingerprint stores.  Keys are edges of the
-    bucket graph (an edge joins a key's two hash choices); the
-    classical theorem: a component can place all its keys iff
-    it has at most one cycle, i.e. edges <= vertices, and the
-    maximum placeable count is sum over components of
-    min(edges, vertices) — the DEFICIENCY formula.  The
-    engine computes components by 6 min-label rounds over
-    self-looped symmetric edges (single-reference stages) with
-    a fixpoint certificate, evaluates the formula, AND runs a
-    genuine augmenting-path maximum matching over the 48 keys
-    in pandas — match_size (every maximum matching has the
-    same size, so the value is policy-independent) must equal
-    the formula's 46: two machines, one from Hall-style
-    structure, one from actual search.  A planted 3-keys-on-
-    {60,61} component is the infeasible witness
-    (n_infeasible == 1).  Scale: min-label CC is the
-    pointer-jumping family (operators/graph.py at corpus
-    scale); the matching runs per-component, and components
-    of a subcritical cuckoo graph are O(log n)."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q746_documents")
-    parts, fin = _q746_sql("q746_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    dims = frags["ky"] + ",\n" + frags["tv"]
-    _pin_view(spark, "WITH " + dims + "\n" + body("eg"),
-              "q746_eg", max_rows=256)
-    _pin_view(spark, "WITH " + dims + "\n" + body("lb0"),
-              "q746_lb0", max_rows=128)
-    chain = []
-    for t in range(1, 6):
-        st = frags[f"lb{t}"].replace(" eg e", " q746_eg e")
-        if t == 1:
-            st = st.replace("lb0 x", "q746_lb0 x")
-        chain.append(st)
-    _pin_view(spark, "WITH " + ",\n".join(chain) + "\n"
-              + body("lb6").replace(" eg e", " q746_eg e"),
-              "q746_lb6", max_rows=128)
-    _pin_view(spark, "WITH " + ",\n".join(chain[:-1]) + "\n"
-              + body("lb5").replace(" eg e", " q746_eg e"),
-              "q746_lb5", max_rows=128)
-
-    # real maximum matching (augmenting paths) on the driver —
-    # fixture-bounded like a _pin_view roundtrip
-    kpdf = spark.sql("WITH " + frags["ky"]
-                     + "\nSELECT k, h1, h2 FROM ky").toPandas()
-    assert len(kpdf) <= 4096
-    hh = {int(r.k): (int(r.h1), int(r.h2))
-          for r in kpdf.itertuples()}
-    match: dict = {}
-
-    def _aug(k, seen):
-        for s in hh[k]:
-            if s not in match:
-                match[s] = k
-                return True
-        for s in hh[k]:
-            if s in seen:
-                continue
-            seen.add(s)
-            if _aug(match[s], seen):
-                match[s] = k
-                return True
-        return False
-
-    placed = sum(1 for k in sorted(hh) if _aug(k, set()))
-    spark.sql(f"SELECT CAST({placed} AS BIGINT) AS match_size") \
-        .createOrReplaceTempView("q746_mt")
-
-    def _sub(text):
-        for nm in ("lb6", "lb5", "mt"):
-            text = re.sub(rf"\b{nm}\b", f"q746_{nm}", text)
-        return text
-    kept = [frags["ky"]] + [_sub(frags[n]) for n in
-                            ("fx", "ce", "cv", "cm", "gl")]
-    fin_e = _sub(fin).replace("CROSS JOIN q746_mt m",
-                              "CROSS JOIN q746_mt m")
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin_e)
-
-
-# ---------------------------------------------------------------------------
-# q747: XOR-filter peeling — round-synchronous 2-core peeling with
-# the engine's constructed filter certified by xor membership
-
-
-def _q747_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 40 keys, 64 slots in three disjoint ranges (22/21/21)
-        # — the partitioned 3-hypergraph of fuse/xor filters;
-        # multiplicative mixing (small-modulus affine hashing
-        # is cyclic-uniform and yields NO singletons)
-        f"ky AS (SELECT CAST(doc_id AS BIGINT) AS kid,\n"
-        f"   ((CAST(doc_id AS BIGINT) * 2654435761 + 12345) %"
-        f" 1000003) % 22 AS s0,\n"
-        f"   22 + ((CAST(doc_id AS BIGINT) * 2246822519 +"
-        f" 54321) % 999983) % 21 AS s1,\n"
-        f"   43 + ((CAST(doc_id AS BIGINT) * 3266489917 +"
-        f" 98765) % 999979) % 21 AS s2\n"
-        f"  FROM {tbl} WHERE doc_id < 40)",
-        "lg AS{mat} (SELECT kid, s0 AS slot FROM ky\n"
-        "   UNION ALL SELECT kid, s1 FROM ky\n"
-        "   UNION ALL SELECT kid, s2 FROM ky)",
-        "al0 AS{mat} (SELECT kid, CAST(1 AS BIGINT) AS alive"
-        " FROM ky)",
-    ]
-    for t in range(1, 7):
-        parts.append(
-            f"al{t} AS{{mat}} (SELECT a.kid,\n"
-            f"   CASE WHEN p.kid IS NULL THEN a.alive ELSE 0"
-            f" END AS alive\n"
-            f" FROM al{t-1} a LEFT JOIN\n"
-            f"   (SELECT DISTINCT l.kid FROM lg l JOIN\n"
-            f"      (SELECT l2.slot, count(*) AS c\n"
-            f"       FROM al{t-1} x JOIN lg l2 ON l2.kid ="
-            f" x.kid\n"
-            f"       WHERE x.alive = 1 GROUP BY l2.slot) g\n"
-            f"     ON g.slot = l.slot AND g.c = 1) p\n"
-            f"   ON p.kid = a.kid AND a.alive = 1)")
-    parts += [
-        "sm AS (SELECT a0.kid, a0.alive + a1.alive + a2.alive"
-        " +\n"
-        "   a3.alive + a4.alive + a5.alive + a6.alive AS rr\n"
-        "  FROM al0 a0 JOIN al1 a1 ON a1.kid = a0.kid\n"
-        "  JOIN al2 a2 ON a2.kid = a0.kid\n"
-        "  JOIN al3 a3 ON a3.kid = a0.kid\n"
-        "  JOIN al4 a4 ON a4.kid = a0.kid\n"
-        "  JOIN al5 a5 ON a5.kid = a0.kid\n"
-        "  JOIN al6 a6 ON a6.kid = a0.kid)",
-        "rh AS (SELECT rr AS peel_round, CAST(count(*) AS"
-        " BIGINT) AS n_peeled\n"
-        "  FROM sm GROUP BY rr)",
-        "un AS (SELECT CAST(sum(alive) AS BIGINT) AS"
-        " n_unpeeled FROM al6)",
-        "fx AS (SELECT CAST(sum(CASE WHEN a.alive <> b.alive"
-        " THEN 1 ELSE 0 END)\n"
-        "   AS BIGINT) AS fixpoint_resid\n"
-        "  FROM al6 a JOIN al5 b ON b.kid = a.kid)",
-        "xv AS (SELECT CAST(0 AS BIGINT) AS xor_viol)",
-    ]
-    fin = (
-        "SELECT r.peel_round, r.n_peeled, u.n_unpeeled,\n"
-        "  f.fixpoint_resid, x.xor_viol\n"
-        "FROM rh r CROSS JOIN un u CROSS JOIN fx f\n"
-        "CROSS JOIN xv x")
-    return parts, fin
-
-
-def _q747_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q747_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q747_xor_filter",
-       "WITH " + _q747_join("documents", "//", " MATERIALIZED"))
-def q747(spark, sf_dir):
-    """XOR filter construction (Graf-Lemire 2020; Bloomier
-    lineage — the static membership structure that beats Bloom
-    filters for immutable blocklists and dedup fingerprint
-    sets) certified end-to-end.  The 3-partition hypergraph
-    (40 keys x 3 disjoint slot ranges, multiplicative mixing
-    hashes — small-modulus affine hashing is cyclic-uniform
-    and produces NO degree-1 slots, measured not guessed)
-    peels ROUND-SYNCHRONOUSLY: each round removes every key
-    holding a singleton slot; the filter is constructible iff
-    peeling empties the key set.  Emitted: the peel-round
-    histogram (16/17/6/1 — the O(log n) parallel peeling
-    profile), n_unpeeled == 0 (the 2-core is empty; load 0.625
-    is subcritical for the 0.818 threshold), and the fixpoint
-    certificate.  The ENGINE then genuinely builds the filter
-    (reverse-round assignment of B[free slot] = fp ^ B[s_a] ^
-    B[s_b] in pandas) and probes ALL 40 keys: xor of each
-    key's three slots must equal its 20-bit fingerprint —
-    xor_viol == 0, with the oracle asserting the theorem that
-    a peelable system always assigns.  Scale: each peel round
-    is one degree count + one anti-join — the round-
-    synchronous template; assignment is per-shard."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q747_documents")
-    parts, fin = _q747_sql("q747_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _pin_view(spark, "WITH " + frags["ky"] + "\n" + body("lg"),
-              "q747_lg", max_rows=256)
-    _pin_view(spark, "WITH " + frags["ky"] + "\n" + body("al0"),
-              "q747_al0", max_rows=64)
-    for t in range(1, 7):
-        st = body(f"al{t}").replace(f"al{t-1}", f"q747_al{t-1}") \
-            .replace(" lg l2", " q747_lg l2") \
-            .replace(" lg l ", " q747_lg l ")
-        _pin_view(spark, st, f"q747_al{t}", max_rows=64)
-
-    # build the filter for real: replay the peel with free-slot
-    # tracking, assign in reverse, probe every key
-    kpdf = spark.sql("WITH " + frags["ky"]
-                     + "\nSELECT kid, s0, s1, s2 FROM ky") \
-        .toPandas()
-    hh = {int(r.kid): (int(r.s0), int(r.s1), int(r.s2))
-          for r in kpdf.itertuples()}
-    alive = set(hh)
-    stack = []
-    while alive:
-        deg: dict = {}
-        for k in alive:
-            for s in hh[k]:
-                deg[s] = deg.get(s, 0) + 1
-        peel = []
-        for k in sorted(alive):
-            free = [s for s in hh[k] if deg[s] == 1]
-            if free:
-                peel.append((k, free[0]))
-        if not peel:
-            break
-        for k, s in peel:
-            alive.discard(k)
-        stack.append(peel)
-    bb = [0] * 64
-    fp = {k: (k * 97 + 5) % 1048576 for k in hh}
-    for peel in reversed(stack):
-        for k, s in reversed(peel):
-            others = [t for t in hh[k] if t != s]
-            bb[s] = fp[k] ^ bb[others[0]] ^ bb[others[1]]
-    viol = sum(1 for k in hh
-               if bb[hh[k][0]] ^ bb[hh[k][1]] ^ bb[hh[k][2]]
-               != fp[k]) + len(alive)
-    spark.sql(f"SELECT CAST({viol} AS BIGINT) AS xor_viol") \
-        .createOrReplaceTempView("q747_xv")
-
-    def _sub(text):
-        for nm in ("al0", "al1", "al2", "al3", "al4", "al5",
-                   "al6", "xv"):
-            text = re.sub(rf"\b{nm}\b", f"q747_{nm}", text)
-        return text
-    kept = [_sub(frags[n]) for n in ("sm", "rh", "un", "fx")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _sub(fin))
-
-
-# ---------------------------------------------------------------------------
-# q748: Raft log invariants — Log Matching, the commit rule, and
-# Leader Completeness checked on a legal history and its tampered twin
-
-
-def _q748_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 5 replica logs from a legal 3-term history: terms 1-3,
-        # r3 carries a stale uncommitted tail from the failed
-        # term-2 leader, r4 is a lagging follower
-        f"dm AS (SELECT CAST(doc_id {{d}} 5 AS BIGINT) AS rep,\n"
-        f"   CAST(doc_id % 5 + 1 AS BIGINT) AS idx\n"
-        f"  FROM {tbl} WHERE doc_id < 25)",
-        "lg AS{mat} (SELECT rep, idx,\n"
-        "   CASE WHEN idx <= 3 THEN 1 WHEN rep = 3 THEN 2 ELSE"
-        " 3 END AS term,\n"
-        "   idx * 10 + (CASE WHEN idx <= 3 THEN 1 WHEN rep = 3"
-        " THEN 2 ELSE 3 END) AS cmd\n"
-        "  FROM dm WHERE idx <= CASE rep WHEN 0 THEN 5 WHEN 1"
-        " THEN 5\n"
-        "    WHEN 2 THEN 4 WHEN 3 THEN 5 ELSE 2 END)",
-        # the tampered twin: r1's entry 3 payload corrupted
-        "lgc AS{mat} (SELECT rep, idx, term,\n"
-        "   CASE WHEN rep = 1 AND idx = 3 THEN 999 ELSE cmd"
-        " END AS cmd\n"
-        "  FROM lg)",
-        # Log Matching: same (idx, term) on two replicas =>
-        # identical entries at EVERY index up to idx
-        "lm AS (SELECT CAST(sum(CASE WHEN p.cmd <> q.cmd OR"
-        " p.term <> q.term\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS lm_viol\n"
-        "  FROM lg a JOIN lg b ON b.rep > a.rep AND b.idx ="
-        " a.idx\n"
-        "    AND b.term = a.term\n"
-        "  JOIN lg p ON p.rep = a.rep AND p.idx <= a.idx\n"
-        "  JOIN lg q ON q.rep = b.rep AND q.idx = p.idx)",
-        "lmc AS (SELECT CAST(sum(CASE WHEN p.cmd <> q.cmd OR"
-        " p.term <> q.term\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS lm_viol_corrupt\n"
-        "  FROM lgc a JOIN lgc b ON b.rep > a.rep AND b.idx ="
-        " a.idx\n"
-        "    AND b.term = a.term\n"
-        "  JOIN lgc p ON p.rep = a.rep AND p.idx <= a.idx\n"
-        "  JOIN lgc q ON q.rep = b.rep AND q.idx = p.idx)",
-        # commit rule: leader r0 (term 3) commits an own-term
-        # entry once a majority stores it; earlier entries
-        # commit transitively
-        "rc AS (SELECT l.idx, l.term, CAST(count(*) AS"
-        " BIGINT) AS repl\n"
-        "  FROM lg l JOIN lg me ON me.rep = 0 AND me.idx ="
-        " l.idx\n"
-        "    AND me.term = l.term\n"
-        "  GROUP BY l.idx, l.term)",
-        "ci AS (SELECT CAST(max(CASE WHEN term = 3 AND repl >="
-        " 3 THEN idx\n"
-        "   ELSE 0 END) AS BIGINT) AS commit_index FROM rc)",
-        # election: voter grants iff candidate's (lastTerm,
-        # lastIdx) >= its own — the up-to-date check
-        "lu AS (SELECT rep, max(idx) AS li,\n"
-        "   max(term * 100 + idx) AS key,\n"
-        "   CAST(max(term * 100 + idx) {d} 100 AS BIGINT) AS"
-        " lt\n"
-        "  FROM lg GROUP BY rep)",
-        "vt AS (SELECT c.rep, CAST(sum(CASE WHEN c.key >="
-        " v.key THEN 1 ELSE 0 END)\n"
-        "   AS BIGINT) AS n_votes\n"
-        "  FROM lu c CROSS JOIN lu v GROUP BY c.rep)",
-        "el AS (SELECT rep, n_votes, CASE WHEN n_votes >= 3"
-        " THEN 1 ELSE 0 END\n"
-        "   AS electable FROM vt)",
-        # Leader Completeness: every electable replica holds
-        # every committed entry, byte-identical to the leader's
-        "lc AS (SELECT CAST(sum(CASE WHEN x.cmd IS NULL OR"
-        " x.cmd <> me.cmd\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS lc_viol\n"
-        "  FROM el e CROSS JOIN ci\n"
-        "  JOIN lg me ON me.rep = 0 AND me.idx <="
-        " ci.commit_index\n"
-        "  LEFT JOIN lg x ON x.rep = e.rep AND x.idx = me.idx\n"
-        "    AND x.term = me.term\n"
-        "  WHERE e.electable = 1)",
-    ]
-    fin = (
-        "SELECT u.rep, u.li AS last_idx, u.lt AS last_term,\n"
-        "  e.n_votes, e.electable, c.commit_index,\n"
-        "  m.lm_viol, mc.lm_viol_corrupt, l.lc_viol\n"
-        "FROM lu u JOIN el e ON e.rep = u.rep\n"
-        "CROSS JOIN ci c CROSS JOIN lm m CROSS JOIN lmc mc\n"
-        "CROSS JOIN lc l")
-    return parts, fin
-
-
-def _q748_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q748_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q748_raft_invariants",
-       "WITH " + _q748_join("documents", "//", " MATERIALIZED"))
-def q748(spark, sf_dir):
-    """Raft's safety invariants (Ongaro-Ousterhout 2014 — the
-    consensus protocol under every replicated manifest store
-    and metadata log this engine's checkpoint/resume story
-    assumes) checked as DATA on a 5-replica, 3-term legal
-    history and its tampered twin.  LOG MATCHING — two logs
-    sharing (index, term) agree on that entry and the entire
-    prefix — holds with zero violations over all replica
-    pairs (r3's stale term-2 tail is legal divergence: same
-    index, DIFFERENT term), while the twin with one corrupted
-    payload on r1 is caught (lm_viol_corrupt == 6 > 0: the
-    corrupt entry and its prefix images over replica pairs).  The COMMIT RULE:
-    leader r0 commits own-term entries on majority
-    replication — commit_index == 4 (entry 5 sits on only 2
-    replicas; entries 1-3 commit transitively).  ELECTION
-    up-to-date voting ((lastTerm, lastIdx) lexicographic,
-    packed as term*100+idx): the stale r3 cannot assemble a
-    majority (its 5-entry log LOSES to r2's shorter 4-entry
-    log because term 3 > term 2 — length is not freshness),
-    and LEADER COMPLETENESS holds: every electable replica
-    carries every committed entry byte-identically (lc_viol
-    == 0) — the theorem that makes Raft elections safe.
-    Scale: pairwise-prefix checks are bounded joins over
-    (replica, index) — at real log lengths the prefix check
-    telescopes to the latest shared index per pair."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q748_documents")
-    parts, fin = _q748_sql("q748_documents", "div", "")
-    dm_frag = parts[0].replace("{mat}", "").replace("{d}",
-                                                    "div")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q748_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("lg", "lgc"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())[1:-1]
-            if nm == "lg":
-                body = "WITH " + dm_frag + "\n" + body
-            _pin_view(spark, body, f"q748_{nm}",
-                      max_rows=64)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin))
-
-
-# ---------------------------------------------------------------------------
-# q749: public-suffix-list eTLD+1 extraction — wildcard and
-# exception rules, certified against a direct replay of the spec
-
-
-def _q749_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"hd0 AS (SELECT CAST(doc_id AS BIGINT) AS hid,\n"
-        f"   CAST(doc_id % 12 AS BIGINT) AS pat,\n"
-        f"   CAST((doc_id {{d}} 12) % 4 AS STRING) AS vs\n"
-        f"  FROM {tbl} WHERE doc_id < 48)",
-        "hd1 AS (SELECT hid, CASE pat\n"
-        "   WHEN 0 THEN 'site' || vs || '.com'\n"
-        "   WHEN 1 THEN 'a.site' || vs || '.com'\n"
-        "   WHEN 2 THEN 'shop' || vs || '.co.uk'\n"
-        "   WHEN 3 THEN 'x.shop' || vs || '.co.uk'\n"
-        "   WHEN 4 THEN 'beta' || vs || '.ck'\n"
-        "   WHEN 5 THEN 'w.beta' || vs || '.ck'\n"
-        "   WHEN 6 THEN 'www.ck'\n"
-        "   WHEN 7 THEN 'sub.www.ck'\n"
-        "   WHEN 8 THEN 'user' || vs || '.github.io'\n"
-        "   WHEN 9 THEN 'github.io'\n"
-        "   WHEN 10 THEN 'deep.a.b.site' || vs || '.com'\n"
-        "   ELSE 'cdn' || vs || '.weird' END AS host\n"
-        "  FROM hd0)",
-        "hd AS{mat} (SELECT hid, host,\n"
-        "   CAST(length(host) - length(replace(host, '.', ''))"
-        " + 1 AS BIGINT) AS n\n"
-        "  FROM hd1)",
-        f"kk AS (SELECT CAST(doc_id + 1 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 4)",
-        # last-k-label suffixes, original order
-        "sf AS{mat} (SELECT h.hid, h.host, h.n, k.k,\n"
-        "   CASE k.k\n"
-        "    WHEN 1 THEN split_part(h.host, '.', CAST(h.n AS"
-        " INT))\n"
-        "    WHEN 2 THEN split_part(h.host, '.', CAST(h.n - 1"
-        " AS INT)) || '.' ||\n"
-        "      split_part(h.host, '.', CAST(h.n AS INT))\n"
-        "    WHEN 3 THEN split_part(h.host, '.', CAST(h.n - 2"
-        " AS INT)) || '.' ||\n"
-        "      split_part(h.host, '.', CAST(h.n - 1 AS INT))"
-        " || '.' ||\n"
-        "      split_part(h.host, '.', CAST(h.n AS INT))\n"
-        "    ELSE split_part(h.host, '.', CAST(h.n - 3 AS"
-        " INT)) || '.' ||\n"
-        "      split_part(h.host, '.', CAST(h.n - 2 AS INT))"
-        " || '.' ||\n"
-        "      split_part(h.host, '.', CAST(h.n - 1 AS INT))"
-        " || '.' ||\n"
-        "      split_part(h.host, '.', CAST(h.n AS INT))\n"
-        "   END AS sfx\n"
-        "  FROM hd h JOIN kk k ON k.k <= h.n)",
-        # the rule list: normal rules match their own label
-        # count; '*.ck' matches via tail 'ck' (one free label);
-        # '!www.ck' is the exception
-        "rl AS (SELECT * FROM (VALUES\n"
-        "   ('com', 0, 1, 1, 'com'), ('net', 0, 1, 1, 'net'),\n"
-        "   ('uk', 0, 1, 1, 'uk'), ('co.uk', 0, 2, 2,"
-        " 'co.uk'),\n"
-        "   ('org.uk', 0, 2, 2, 'org.uk'), ('io', 0, 1, 1,"
-        " 'io'),\n"
-        "   ('github.io', 0, 2, 2, 'github.io'),\n"
-        "   ('*.ck', 1, 2, 1, 'ck'), ('!www.ck', 2, 2, 2,"
-        " 'www.ck'))\n"
-        "  t(pat, kind, lbs, mk, ms))",
-        "mt AS (SELECT s.hid, r.kind, r.lbs\n"
-        "  FROM rl r JOIN sf s ON s.k = r.mk AND s.sfx = r.ms\n"
-        "  WHERE r.kind <> 1 OR s.n >= 2)",
-        # exception wins outright; else longest match; else the
-        # implicit default rule '*' (one label)
-        "bs AS (SELECT h.hid, h.host, h.n,\n"
-        "   CASE WHEN max(CASE WHEN m.kind = 2 THEN 1 ELSE 0"
-        " END) = 1 THEN 1\n"
-        "        ELSE coalesce(max(CASE WHEN m.kind <= 1 THEN"
-        " m.lbs END), 1) END\n"
-        "     AS ps_labels,\n"
-        "   CASE WHEN max(CASE WHEN m.kind = 2 THEN 1 ELSE 0"
-        " END) = 1 THEN 2\n"
-        "        WHEN max(m.kind) IS NULL THEN 3\n"
-        "        ELSE coalesce(max(CASE WHEN m.kind <= 1 THEN"
-        " m.lbs * 4 + m.kind END)\n"
-        "          % 4, 3) END AS kind_used\n"
-        "  FROM hd h LEFT JOIN mt m ON m.hid = h.hid\n"
-        "  GROUP BY h.hid, h.host, h.n)",
-        "ps AS (SELECT b.hid, b.host, b.n, b.ps_labels,\n"
-        "   b.kind_used, s.sfx AS public_suffix,\n"
-        "   coalesce(e.sfx, '') AS etld1\n"
-        "  FROM bs b JOIN sf s ON s.hid = b.hid AND s.k ="
-        " b.ps_labels\n"
-        "  LEFT JOIN sf e ON e.hid = b.hid AND e.k ="
-        " b.ps_labels + 1)",
-        "py AS (SELECT hid, public_suffix AS suffix_py,\n"
-        "   etld1 AS etld1_py FROM ps)",
-    ]
-    fin = (
-        "SELECT p.hid, p.host, p.n AS n_labels,\n"
-        "  p.public_suffix, p.etld1, p.kind_used,\n"
-        "  y.suffix_py, y.etld1_py,\n"
-        "  CASE WHEN p.public_suffix = y.suffix_py AND p.etld1"
-        " = y.etld1_py\n"
-        "   THEN 1 ELSE 0 END AS agree\n"
-        "FROM ps p JOIN py y ON y.hid = p.hid")
-    return parts, fin
-
-
-def _q749_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q749_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q749_public_suffix",
-       "WITH " + _q749_join("documents", "//", " MATERIALIZED"))
-def q749(spark, sf_dir):
-    """Public-suffix-list registrable-domain extraction (the
-    Mozilla PSL algorithm — eTLD+1 is the grouping key under
-    every host-level statistic, crawl politeness budget and
-    cookie boundary this engine computes; get it wrong and
-    'foo.co.uk' aggregates with 'bar.co.uk' under 'co.uk').
-    The full rule semantics run RELATIONALLY: normal rules
-    match their own label count, the wildcard '*.ck' consumes
-    exactly one free label (so a bare 'betaN.ck' host IS a
-    public suffix — registrable domain empty), the exception
-    '!www.ck' beats the wildcard and shortens the suffix to
-    'ck', longest match wins otherwise, and unlisted TLDs fall
-    to the implicit default '*' rule.  48 hosts exercise every
-    branch: plain com, deep subdomains, co.uk, wildcard hits
-    with and without extra labels, the exception and a
-    subdomain of it, private-registry github.io (exactly the
-    rule that makes user sites separate registrants), and an
-    unlisted TLD.  The ENGINE additionally replays the spec
-    directly per host in one applyInPandas pass (suffix_py /
-    etld1_py) — the comparator enforcing relational == replay
-    on both strings is the cross-machine certificate (agree
-    == 1 everywhere).  Scale: suffix explosion is bounded (4
-    rows/host); matching is an equi-join against a broadcast
-    rule dim."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q749_documents")
-    parts, fin = _q749_sql("q749_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _pin_view(spark, "WITH " + frags["hd0"] + ",\n"
-              + frags["hd1"] + "\n" + body("hd"),
-              "q749_hd", max_rows=64)
-    _pin_view(spark, "WITH " + frags["kk"] + "\n"
-              + body("sf").replace("FROM hd h", "FROM q749_hd"
-                                   " h"),
-              "q749_sf", max_rows=256)
-
-    RULES = [("com", 0), ("net", 0), ("uk", 0), ("co.uk", 0),
-             ("org.uk", 0), ("io", 0), ("github.io", 0),
-             ("*.ck", 1), ("!www.ck", 2)]
-
-    def _psl(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for r in pdf.itertuples():
-            labs = r.host.split(".")
-            n = len(labs)
-            exc_len = None
-            best = 1
-            for pat, kind in RULES:
-                rl = pat.lstrip("!").split(".")
-                if len(rl) > n:
-                    continue
-                tail = labs[n - len(rl):]
-                if all(a == "*" or a == b
-                       for a, b in zip(rl, tail)):
-                    if kind == 2:
-                        exc_len = len(rl) - 1
-                    else:
-                        best = max(best, len(rl))
-            ps_len = exc_len if exc_len is not None else best
-            sfx = ".".join(labs[n - ps_len:])
-            e1 = (".".join(labs[n - ps_len - 1:])
-                  if n > ps_len else "")
-            out.append((int(r.hid), sfx, e1))
-        return pd.DataFrame(
-            out, columns=["hid", "suffix_py", "etld1_py"])
-
-    spark.table("q749_hd").groupBy("hid").applyInPandas(
-        _psl, "hid long, suffix_py string, etld1_py string") \
-        .createOrReplaceTempView("q749_py")
-
-    def _sub(text):
-        for nm in ("hd", "sf", "py"):
-            text = re.sub(rf"\b{nm}\b", f"q749_{nm}", text)
-        return text
-    kept = [frags["rl"], _sub(frags["mt"]), _sub(frags["bs"]),
-            _sub(frags["ps"])]
-    fin_e = fin.replace("FROM ps p", "FROM ps p") \
-               .replace("JOIN py y", "JOIN q749_py y")
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin_e)
-
-
-# ---------------------------------------------------------------------------
-# q750: weighted deficit round robin — Shreedhar-Varghese fair
-# queueing with the deficit-conservation identity as certificate
-
-
-def _q750_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 6 flows x 10 packets; sizes from real document
-        # lengths; quanta 20/20/40/40/60/15
-        f"pk0 AS (SELECT CAST(doc_id {{d}} 10 AS BIGINT) AS f,\n"
-        f"   CAST(doc_id % 10 AS BIGINT) AS j,\n"
-        f"   CAST(n_chars % 50 + 10 AS BIGINT) AS size\n"
-        f"  FROM {tbl} WHERE doc_id < 60)",
-        "pk AS{mat} (SELECT f, j, size,\n"
-        "   sum(size) OVER (PARTITION BY f ORDER BY j\n"
-        "     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT"
-        " ROW) AS cum\n"
-        "  FROM pk0)",
-        "st0 AS{mat} (SELECT f, CASE f WHEN 0 THEN 20 WHEN 1"
-        " THEN 20\n"
-        "   WHEN 2 THEN 40 WHEN 3 THEN 40 WHEN 4 THEN 60 ELSE"
-        " 15 END AS q,\n"
-        "   CAST(0 AS BIGINT) AS dq, CAST(0 AS BIGINT) AS"
-        " nxt,\n"
-        "   CAST(0 AS BIGINT) AS sent\n"
-        "  FROM (SELECT DISTINCT f FROM pk0) z)",
-    ]
-    for t in range(1, 7):
-        parts.append(
-            f"st{t} AS{{mat}} (SELECT s.f, s.q,\n"
-            f"   CASE WHEN s.nxt + b.cnt < 10 THEN s.dq + s.q"
-            f" - b.byt\n"
-            f"        ELSE 0 END AS dq,\n"
-            f"   s.nxt + b.cnt AS nxt, s.sent + b.byt AS sent\n"
-            f"  FROM st{t-1} s JOIN (\n"
-            f"    SELECT s2.f,\n"
-            f"     CAST(coalesce(sum(CASE WHEN p.cum -"
-            f" coalesce(pc.cum, 0)\n"
-            f"       <= s2.dq + s2.q THEN p.size END), 0) AS"
-            f" BIGINT) AS byt,\n"
-            f"     CAST(coalesce(sum(CASE WHEN p.cum -"
-            f" coalesce(pc.cum, 0)\n"
-            f"       <= s2.dq + s2.q THEN 1 END), 0) AS"
-            f" BIGINT) AS cnt\n"
-            f"    FROM st{t-1} s2\n"
-            f"    LEFT JOIN pk pc ON pc.f = s2.f AND pc.j ="
-            f" s2.nxt - 1\n"
-            f"    LEFT JOIN pk p ON p.f = s2.f AND p.j >="
-            f" s2.nxt\n"
-            f"    GROUP BY s2.f) b ON b.f = s.f)")
-    parts += [
-        # sent bytes == prefix-sum at the send frontier
-        "cs AS (SELECT CAST(sum(CASE WHEN s.sent <>"
-        " coalesce(pc.cum, 0)\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS cons_viol\n"
-        "  FROM st6 s LEFT JOIN pk pc ON pc.f = s.f AND pc.j ="
-        " s.nxt - 1)",
-        # deficit conservation: backlogged flows satisfy\n
-        # sent == rounds*quantum - deficit EXACTLY
-        "ident AS (SELECT CAST(sum(CASE WHEN s.nxt < 10 AND\n"
-        "   s.sent <> 6 * s.q - s.dq THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "   AS identity_viol FROM st6 s)",
-        # maximal-prefix invariant: remaining deficit cannot\n
-        # cover the next packet
-        "inv AS (SELECT CAST(sum(CASE WHEN s.nxt < 10 AND"
-        " s.dq >= p.size\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS invariant_viol\n"
-        "  FROM st6 s JOIN pk p ON p.f = s.f AND p.j ="
-        " s.nxt)",
-    ]
-    fin = (
-        "SELECT s.f, s.q AS quantum, s.sent, s.dq AS"
-        " deficit,\n"
-        "  s.nxt AS n_sent_pkts,\n"
-        "  CASE WHEN s.nxt < 10 THEN 1 ELSE 0 END AS"
-        " backlogged,\n"
-        "  c.cons_viol, i.identity_viol, v.invariant_viol\n"
-        "FROM st6 s CROSS JOIN cs c CROSS JOIN ident i\n"
-        "CROSS JOIN inv v")
-    return parts, fin
-
-
-def _q750_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q750_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q750_deficit_round_robin",
-       "WITH " + _q750_join("documents", "//", " MATERIALIZED"))
-def q750(spark, sf_dir):
-    """Weighted deficit round robin (Shreedhar-Varghese 1996 —
-    the O(1) fair scheduler inside routers, and the shape of
-    every per-host fetch-budget wheel a polite crawler runs)
-    simulated ROUND-SYNCHRONOUSLY in exact integers over real
-    packet sizes (document lengths), with the scheduler's
-    conservation laws as certificates.  Each round every
-    backlogged flow adds its quantum to its deficit counter
-    and sends the MAXIMAL PREFIX of queued packets fitting the
-    budget (closed-formed as a prefix-sum comparison — no
-    inner packet loop); an emptied flow forfeits its deficit.
-    Three exact certificates: (1) sent bytes equal the prefix
-    sum at the send frontier (accounting); (2) DEFICIT
-    CONSERVATION — every continuously-backlogged flow has
-    sent == rounds * quantum - deficit EXACTLY, the identity
-    from which Shreedhar-Varghese's fairness bound follows
-    (service deviates from r*q by less than one max packet);
-    (3) the maximal-prefix invariant deficit < next packet
-    size, which is what keeps deficits bounded.  Quanta
-    20/20/40/40/60/15 show weighted sharing: sent bytes
-    89/105/227/231/283/51 track the weights, flow 4 draining
-    entirely.  Scale: rounds are one join + grouped sum over
-    the packet table; flows are independent — partition by
-    flow."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q750_documents")
-    parts, fin = _q750_sql("q750_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _pin_view(spark, "WITH " + frags["pk0"] + "\n" + body("pk"),
-              "q750_pk", max_rows=128)
-    _pin_view(spark, "WITH " + frags["pk0"] + "\n"
-              + body("st0"), "q750_st0", max_rows=16)
-    for t in range(1, 7):
-        st = body(f"st{t}")
-        st = re.sub(rf"\bst{t-1}\b", f"q750_st{t-1}", st)
-        st = re.sub(r"\bpk\b", "q750_pk", st)
-        _pin_view(spark, st, f"q750_st{t}", max_rows=16)
-
-    def _sub(text):
-        for nm in ("st6", "pk"):
-            text = re.sub(rf"\b{nm}\b", f"q750_{nm}", text)
-        return text
-    kept = [_sub(frags[n]) for n in ("cs", "ident", "inv")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _sub(fin))
-
-
-# ---------------------------------------------------------------------------
-# q751: percent-encoding normalization (RFC 3986 §6.2.2) — decode
-# unreserved, uppercase the rest, certified by spec replay
-
-
-_Q751_POW = [pow(131, i, 1000003) for i in range(16)]
-
-
-def _q751_sql(tbl: str, d: str, mat: str):
-    pw = " ".join(f"WHEN {i} THEN {w}"
-                  for i, w in enumerate(_Q751_POW))
-    parts = [
-        f"ud0 AS (SELECT CAST(doc_id AS BIGINT) AS uid,\n"
-        f"   CAST(doc_id {{d}} 4 AS BIGINT) AS g,\n"
-        f"   CAST(doc_id % 4 AS BIGINT) AS v,\n"
-        f"   CAST(doc_id {{d}} 4 AS STRING) AS gs\n"
-        f"  FROM {tbl} WHERE doc_id < 48)",
-        # 12 groups x 4 encoding variants of one canonical URL:
-        # groups 0-5 play with unreserved escapes (%2D %5F %7E,
-        # both hex cases), 6-10 with the reserved %2F that must
-        # NOT decode, group 11 uses a literal '/' — same spot,
-        # different URL
-        "ud AS{mat} (SELECT uid, g, v,\n"
-        "   'http://h' || gs || '.com/a' || CASE\n"
-        "    WHEN g <= 5 THEN CASE v\n"
-        "     WHEN 0 THEN '-x_y.z~'\n"
-        "     WHEN 1 THEN '%2Dx_y.z%7E'\n"
-        "     WHEN 2 THEN '%2dx_y.z%7e'\n"
-        "     ELSE '-x%5Fy.z~' END\n"
-        "    WHEN g = 11 THEN 'q/r'\n"
-        "    ELSE CASE v WHEN 1 THEN 'q%2Fr' WHEN 3 THEN"
-        " 'q%2Fr'\n"
-        "     ELSE 'q%2fr' END\n"
-        "   END AS url FROM ud0)",
-        f"pp AS (SELECT CAST(doc_id + 1 AS BIGINT) AS p"
-        f" FROM {tbl} WHERE doc_id < 40)",
-        "ch AS{mat} (SELECT u.uid, u.g, u.v, u.url, p.p,\n"
-        "   substr(u.url, CAST(p.p AS INT), 1) AS c,\n"
-        "   CASE WHEN p.p >= 2 THEN substr(u.url, CAST(p.p -"
-        " 1 AS INT), 1)\n"
-        "    ELSE '' END AS c1,\n"
-        "   CASE WHEN p.p >= 3 THEN substr(u.url, CAST(p.p -"
-        " 2 AS INT), 1)\n"
-        "    ELSE '' END AS c2\n"
-        "  FROM ud u JOIN pp p ON p.p <= length(u.url))",
-        # percent-triplet decode: hex via instr on the lowered
-        # digit; unreserved = ALPHA / DIGIT / - . _ ~
-        "tr AS (SELECT uid, g, v, url, p,\n"
-        "   (instr('0123456789abcdef', lower(c1)) - 1) * 16 +\n"
-        "   instr('0123456789abcdef', lower(c2)) - 1 AS code\n"
-        "  FROM (SELECT uid, g, v, url, p,\n"
-        "     substr(url, CAST(p + 1 AS INT), 1) AS c1,\n"
-        "     substr(url, CAST(p + 2 AS INT), 1) AS c2\n"
-        "    FROM ch WHERE c = '%') z)",
-        # output rows: plain kept chars; decoded unreserved
-        # triplets; or %XX re-emitted UPPERCASED as 3 rows
-        "em AS{mat} (SELECT uid, g, v, p, 0 AS sub,\n"
-        "   CAST(ascii(c) AS BIGINT) AS code\n"
-        "  FROM ch WHERE c <> '%' AND c1 <> '%' AND c2 <> '%'\n"
-        "  UNION ALL\n"
-        "  SELECT uid, g, v, p, 0,\n"
-        "   CAST(code AS BIGINT)\n"
-        "  FROM tr WHERE code BETWEEN 48 AND 57 OR code"
-        " BETWEEN 65 AND 90\n"
-        "   OR code BETWEEN 97 AND 122 OR code IN (45, 46,"
-        " 95, 126)\n"
-        "  UNION ALL\n"
-        "  SELECT uid, g, v, p, s.sub,\n"
-        "   CASE s.sub WHEN 0 THEN CAST(37 AS BIGINT)\n"
-        "    WHEN 1 THEN CAST(ascii(upper(substr(url, CAST(p"
-        " + 1 AS INT), 1))) AS BIGINT)\n"
-        "    ELSE CAST(ascii(upper(substr(url, CAST(p + 2 AS"
-        " INT), 1))) AS BIGINT) END\n"
-        "  FROM tr CROSS JOIN (SELECT CAST(x AS BIGINT) AS"
-        " sub\n"
-        "    FROM (VALUES (0), (1), (2)) t(x)) s\n"
-        "  WHERE NOT (code BETWEEN 48 AND 57 OR code BETWEEN"
-        " 65 AND 90\n"
-        "   OR code BETWEEN 97 AND 122 OR code IN (45, 46,"
-        " 95, 126)))",
-        "nm AS (SELECT uid, g, v,\n"
-        "   CAST(count(*) AS BIGINT) AS norm_len,\n"
-        "   CAST(sum(code * CASE CAST(op % 16 AS INT) " + pw
-        + " END) % 1000003 AS BIGINT) AS chk\n"
-        "  FROM (SELECT uid, g, v, code,\n"
-        "     row_number() OVER (PARTITION BY uid ORDER BY p,"
-        " sub) AS op\n"
-        "    FROM em) z GROUP BY uid, g, v)",
-        "wv AS (SELECT CAST(sum(cnt_d - 1) AS BIGINT) AS"
-        " within_viol FROM\n"
-        "  (SELECT g, count(DISTINCT chk * 100 + norm_len) AS"
-        " cnt_d\n"
-        "   FROM nm GROUP BY g) z)",
-        "cv AS (SELECT 12 - CAST(count(DISTINCT chk * 100 +"
-        " norm_len) AS BIGINT)\n"
-        "   AS cross_viol FROM nm)",
-        "py AS (SELECT uid, chk AS py_chk, norm_len AS"
-        " py_len FROM nm)",
-    ]
-    fin = (
-        "SELECT n.uid, n.g, n.v, u.url, n.norm_len, n.chk,\n"
-        "  y.py_chk, y.py_len,\n"
-        "  CASE WHEN n.chk = y.py_chk AND n.norm_len ="
-        " y.py_len\n"
-        "   THEN 1 ELSE 0 END AS agree,\n"
-        "  w.within_viol, c.cross_viol\n"
-        "FROM nm n JOIN ud u ON u.uid = n.uid\n"
-        "JOIN py y ON y.uid = n.uid\n"
-        "CROSS JOIN wv w CROSS JOIN cv c")
-    return parts, fin
-
-
-def _q751_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q751_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q751_percent_normalization",
-       "WITH " + _q751_join("documents", "//", " MATERIALIZED"))
-def q751(spark, sf_dir):
-    """Percent-encoding normalization (RFC 3986 §6.2.2 — the
-    equivalence the URL frontier must compute before hashing,
-    or 'a%2Db' and 'a-b' crawl twice while 'a%2Fb' and 'a/b'
-    wrongly collapse): decode UNRESERVED escapes (ALPHA,
-    DIGIT, '-', '.', '_', '~'), uppercase the hex of every
-    escape that must stay (reserved characters change URL
-    semantics if decoded), leave literals alone — implemented
-    as a pure relational pass (position explode, triplet
-    detect via instr hex, three-way emit, order-sensitive
-    polynomial checksum over output positions — the q63
-    vertex-checksum pattern for strings).  12 canonical URLs
-    x 4 encoding variants (both hex cases, multiple
-    unreserved escapes): all four variants of each group
-    normalize to the SAME checksum+length (within_viol == 0)
-    and the 12 groups stay DISTINCT (cross_viol == 0) —
-    including the sharp pair 'q%2Fr' vs literal 'q/r' at the
-    same position, which differ exactly because %2F must not
-    decode.  The ENGINE replays the spec directly per URL in
-    applyInPandas and the comparator enforces replay ==
-    relational on every row (agree == 1).  Scale: bounded
-    position explode + window row_number — linear per URL."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q751_documents")
-    parts, fin = _q751_sql("q751_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _pin_view(spark, "WITH " + frags["ud0"] + "\n" + body("ud"),
-              "q751_ud", max_rows=64)
-    _pin_view(spark, "WITH " + frags["pp"] + "\n"
-              + re.sub(r"\bud\b", "q751_ud", body("ch")),
-              "q751_ch", max_rows=2048)
-    _pin_view(spark,
-              "WITH tr AS (" + re.sub(r"\bch\b", "q751_ch",
-                                      body("tr")) + ")\n"
-              + re.sub(r"\bch\b", "q751_ch",
-                       re.sub(r"\btr\b", "tr", body("em"))),
-              "q751_em", max_rows=4096)
-
-    def _psl(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        unres = set("ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-                    "abcdefghijklmnopqrstuvwxyz0123456789-._~")
-        for r in pdf.itertuples():
-            u = r.url
-            res = []
-            i = 0
-            while i < len(u):
-                if u[i] == "%" and i + 2 < len(u):
-                    code = int(u[i + 1:i + 3], 16)
-                    if chr(code) in unres:
-                        res.append(code)
-                    else:
-                        res.extend([37, ord(u[i + 1].upper()),
-                                    ord(u[i + 2].upper())])
-                    i += 3
-                else:
-                    res.append(ord(u[i]))
-                    i += 1
-            chk = sum(c * _Q751_POW[(j + 1) % 16]
-                      for j, c in enumerate(res)) % 1000003
-            out.append((int(r.uid), chk, len(res)))
-        return pd.DataFrame(
-            out, columns=["uid", "py_chk", "py_len"])
-
-    spark.table("q751_ud").groupBy("uid").applyInPandas(
-        _psl, "uid long, py_chk long, py_len long") \
-        .createOrReplaceTempView("q751_py")
-
-    def _sub(text):
-        for nm in ("em", "ud", "py"):
-            text = re.sub(rf"\b{nm}\b", f"q751_{nm}", text)
-        return text
-    kept = [_sub(frags[n]) for n in ("nm", "wv", "cv")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _sub(fin))
-
-
-# ---------------------------------------------------------------------------
-# q752: DDSketch relative-error quantiles — log-bucketed, exactly
-# mergeable, the guarantee certified by integer containment
-
-
-_Q752_BOUNDS = (
-    "WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 2"
-    " WHEN 4 THEN 3 WHEN 5 THEN 4 WHEN 6 THEN 4 WHEN 7 THEN 5"
-    " WHEN 8 THEN 6 WHEN 9 THEN 8 WHEN 10 THEN 10 WHEN 11 THEN"
-    " 12 WHEN 12 THEN 15 WHEN 13 THEN 19 WHEN 14 THEN 23 WHEN"
-    " 15 THEN 29 WHEN 16 THEN 36 WHEN 17 THEN 45 WHEN 18 THEN"
-    " 56 WHEN 19 THEN 70 WHEN 20 THEN 87 WHEN 21 THEN 109 WHEN"
-    " 22 THEN 136 WHEN 23 THEN 170 WHEN 24 THEN 212 WHEN 25"
-    " THEN 265 WHEN 26 THEN 331 WHEN 27 THEN 414 WHEN 28 THEN"
-    " 517 WHEN 29 THEN 647 WHEN 30 THEN 808 WHEN 31 THEN 1010"
-    " WHEN 32 THEN 1263 ELSE 1578")
-
-
-def _q752_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"jd AS (SELECT CAST(doc_id AS BIGINT) AS j"
-        f" FROM {tbl} WHERE doc_id < 34)",
-        # exact gamma = 5/4 boundaries b_j = ceil((5/4)^j),
-        # Python-precomputed as Fractions, inlined — no float
-        # log anywhere
-        "bd AS (SELECT j, CAST(CASE CAST(j AS INT) "
-        + _Q752_BOUNDS + " END AS BIGINT) AS b FROM jd)",
-        f"vl AS{{mat}} (SELECT doc_id, CAST(n_chars AS BIGINT)"
-        f" AS x,\n"
-        f"   CAST(doc_id % 2 AS BIGINT) AS shard"
-        f" FROM {tbl})",
-        # bucket index = (number of boundaries <= x) - 1
-        "bk AS{mat} (SELECT v.doc_id, v.x, v.shard,\n"
-        "   CAST(count(*) - 1 AS BIGINT) AS k\n"
-        "  FROM vl v JOIN bd ON bd.b <= v.x\n"
-        "  GROUP BY v.doc_id, v.x, v.shard)",
-        "sk AS (SELECT shard, k, CAST(count(*) AS BIGINT) AS"
-        " c\n"
-        "  FROM bk GROUP BY shard, k)",
-        "mg AS (SELECT k, CAST(sum(c) AS BIGINT) AS c FROM sk"
-        " GROUP BY k)",
-        "fu AS (SELECT k, CAST(count(*) AS BIGINT) AS c FROM"
-        " bk GROUP BY k)",
-        # merge exactness: shard sketches add to the full one
-        "mv AS (SELECT CAST(sum(CASE WHEN f.c IS NULL OR m.c"
-        " <> f.c\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS merge_viol\n"
-        "  FROM mg m LEFT JOIN fu f ON f.k = m.k)",
-        "nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM"
-        " vl)",
-        "qd AS (SELECT CAST(x AS BIGINT) AS q FROM (VALUES"
-        " (50), (90), (99)) t(x))",
-        "rk AS (SELECT q.q, (q.q * n.n + 99) {d} 100 AS r,"
-        " n.n\n"
-        "  FROM qd q CROSS JOIN nn n)",
-        "tv AS (SELECT r.q, r.r, r.n, v.x AS true_val\n"
-        "  FROM rk r JOIN (SELECT x, row_number() OVER (ORDER"
-        " BY x, doc_id)\n"
-        "    AS rn FROM vl) v ON v.rn = r.r)",
-        "cm AS (SELECT k, sum(c) OVER (ORDER BY k ROWS"
-        " BETWEEN UNBOUNDED\n"
-        "   PRECEDING AND CURRENT ROW) AS cum FROM mg)",
-        "qb AS (SELECT t.q, CAST(min(c.k) AS BIGINT) AS k\n"
-        "  FROM tv t JOIN cm c ON c.cum >= t.r GROUP BY"
-        " t.q)",
-    ]
-    fin = (
-        "SELECT t.q, t.r, t.n, t.true_val, b.k,\n"
-        "  lo.b AS lo, hi.b AS hi,\n"
-        "  CASE WHEN lo.b <= t.true_val AND t.true_val <"
-        " hi.b\n"
-        "   THEN 1 ELSE 0 END AS in_range,\n"
-        "  CASE WHEN 4 * hi.b <= 5 * lo.b + 4 THEN 1 ELSE 0"
-        " END AS width_ok,\n"
-        "  m.merge_viol\n"
-        "FROM tv t JOIN qb b ON b.q = t.q\n"
-        "JOIN bd lo ON lo.j = b.k\n"
-        "JOIN bd hi ON hi.j = b.k + 1\n"
-        "CROSS JOIN mv m")
-    return parts, fin
-
-
-def _q752_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q752_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q752_ddsketch_quantiles",
-       "WITH " + _q752_join("documents", "//", " MATERIALIZED"))
-def q752(spark, sf_dir):
-    """DDSketch (Masson-Rim-Lee 2019 — the relative-error
-    quantile sketch Datadog ships for latency monitoring; the
-    percentile telemetry shape for any crawl fleet) built
-    log-bucketed over the real n_chars distribution with
-    gamma = 5/4, NO floating log anywhere: boundaries are
-    ceil((5/4)^j) precomputed exactly as Fractions and the
-    bucket index is a pure counting join (number of
-    boundaries <= x).  Certified: (1) EXACT MERGEABILITY —
-    the two shard sketches (even/odd docs) sum bucket-wise to
-    the full-corpus sketch with zero violations, the property
-    that makes the sketch a distributed aggregate; (2) the
-    RELATIVE-ERROR GUARANTEE as integer containment — for
-    q50/q90/q99 the true quantile (computed exactly by
-    row_number) lies inside the sketch-reported bucket
-    [b_k, b_{k+1}) on every quantile (in_range == 1), with
-    the bucket-width bound 4 b_{k+1} <= 5 b_k + 4 certifying
-    the 25% band; (3) rank arithmetic r = ceil(qn/100) in
-    exact integers.  Scale: the sketch is a groupBy of
-    bounded cardinality (34 buckets) — map-side combinable,
-    constant-size state, the whole point of sketching."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q752_documents")
-    parts, fin = _q752_sql("q752_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q753: Boyer-Moore majority vote — the one-pass automaton
-# certified against exact counting, with the no-majority caveat
-
-
-def _q753_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"kd AS (SELECT CAST(doc_id + 1 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 60)",
-        # 8 token streams; even streams get 'x' planted at 2
-        # of every 3 positions (a true majority), odd streams
-        # are raw words (no majority in word soup)
-        f"el AS{{mat}} (SELECT t.doc_id AS s, k.k AS pos,\n"
-        f"   CASE WHEN t.doc_id % 2 = 0 AND k.k % 3 < 2 THEN"
-        f" 'x'\n"
-        f"    ELSE split_part(t.text, ' ', CAST(k.k AS INT))"
-        f" END AS e\n"
-        f"  FROM {tbl} t CROSS JOIN kd k\n"
-        f"  WHERE t.doc_id < 8\n"
-        f"    AND split_part(t.text, ' ', CAST(k.k AS INT))"
-        f" <> '')",
-        "cnt AS (SELECT s, e, CAST(count(*) AS BIGINT) AS c\n"
-        "  FROM el GROUP BY s, e)",
-        "mx AS (SELECT s, max(c) AS maxc,\n"
-        "   CAST(sum(c) AS BIGINT) AS n FROM cnt GROUP BY"
-        " s)",
-        "am AS (SELECT c.s, min(c.e) AS arg_max, m.maxc,"
-        " m.n,\n"
-        "   CASE WHEN 2 * m.maxc > m.n THEN 1 ELSE 0 END AS"
-        " has_majority\n"
-        "  FROM cnt c JOIN mx m ON m.s = c.s AND c.c ="
-        " m.maxc\n"
-        "  GROUP BY c.s, m.maxc, m.n)",
-        # the Boyer-Moore automaton: counter-cancel walk
-        "bm AS (SELECT s, CAST(0 AS BIGINT) AS pos,\n"
-        "   '' AS cand, CAST(0 AS BIGINT) AS cnt2\n"
-        "  FROM (SELECT DISTINCT s FROM el) z\n"
-        "  UNION ALL\n"
-        "  SELECT w.s, e.pos,\n"
-        "   CASE WHEN w.cnt2 = 0 THEN e.e ELSE w.cand END,\n"
-        "   CASE WHEN w.cnt2 = 0 THEN 1\n"
-        "        WHEN e.e = w.cand THEN w.cnt2 + 1\n"
-        "        ELSE w.cnt2 - 1 END\n"
-        "  FROM bm w JOIN el e ON e.s = w.s AND e.pos ="
-        " w.pos + 1)",
-        "bf AS (SELECT b.s, b.cand FROM bm b\n"
-        "  JOIN (SELECT s, max(pos) AS mp FROM bm GROUP BY"
-        " s) t\n"
-        "   ON t.s = b.s AND t.mp = b.pos)",
-        # second pass: verify the candidate by exact count
-        "vf AS (SELECT f.s, f.cand,\n"
-        "   CAST(coalesce(max(c.c), 0) AS BIGINT) AS"
-        " cand_count\n"
-        "  FROM bf f LEFT JOIN cnt c ON c.s = f.s AND c.e ="
-        " f.cand\n"
-        "  GROUP BY f.s, f.cand)",
-    ]
-    fin = (
-        "SELECT a.s, a.n, a.maxc AS max_count,"
-        " a.has_majority,\n"
-        "  a.arg_max, v.cand AS bm_candidate,"
-        " v.cand_count,\n"
-        "  CASE WHEN 2 * v.cand_count > a.n THEN 1 ELSE 0"
-        " END AS bm_verified,\n"
-        "  CASE WHEN a.has_majority = 1 AND v.cand <>"
-        " a.arg_max\n"
-        "   THEN 1 ELSE 0 END AS bm_viol\n"
-        "FROM am a JOIN vf v ON v.s = a.s")
-    return parts, fin
-
-
-def _q753_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q753_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q753_boyer_moore_majority",
-       "WITH RECURSIVE " + _q753_join("documents", "//",
-                                      " MATERIALIZED"))
-def q753(spark, sf_dir):
-    """The Boyer-Moore majority vote (Boyer-Moore 1981, MJRTY
-    — O(1)-state streaming majority, the canonical example of
-    a one-pass automaton whose guarantee needs a second pass)
-    certified against exact counting on 8 real token streams.
-    THEOREM: if a strict majority exists, the counter-cancel
-    automaton ends holding it — even streams carry a planted
-    2-of-3 'x' majority and bm_viol == 0 on all of them; odd
-    streams are raw word-soup with NO majority, where the
-    automaton's final candidate is MEANINGLESS — which is
-    exactly why MJRTY is two-pass: the verify count
-    (cand_count, the second pass) correctly accepts every
-    planted majority and rejects every no-majority stream
-    (bm_verified == has_majority on all 8).  Engine: the walk
-    runs per-stream in one applyInPandas pass; the oracle
-    replays it as a WITH RECURSIVE orbit over the same
-    element table; counting and verification stay relational
-    on both.  Scale: the automaton is the degenerate k = 1
-    case of Misra-Gries (q563) — constant state per stream,
-    streams partition."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q753_documents")
-    parts, fin = _q753_sql("q753_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _pin_view(spark, "WITH " + frags["kd"] + "\n" + body("el"),
-              "q753_el", max_rows=1024)
-
-    def _bm(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        cand, cnt = "", 0
-        for e in pdf["e"]:
-            if cnt == 0:
-                cand, cnt = e, 1
-            elif e == cand:
-                cnt += 1
-            else:
-                cnt -= 1
-        return pd.DataFrame(
-            {"s": [int(pdf["s"].iloc[0])], "cand": [cand]})
-
-    spark.table("q753_el").groupBy("s").applyInPandas(
-        _bm, "s long, cand string") \
-        .createOrReplaceTempView("q753_bf")
-
-    def _sub(text):
-        for nm in ("el", "bf"):
-            text = re.sub(rf"\b{nm}\b", f"q753_{nm}", text)
-        return text
-    kept = [_sub(frags[n]) for n in ("cnt", "mx", "am", "vf")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _sub(fin))
-
-
-# ---------------------------------------------------------------------------
-# q754: ski rental — the break-even rule's (2 - 1/b) minimax,
-# both sides of the bound from one exhaustive census
-
-
-def _q754_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # strategies k = 1..31 (buy at day k; 31 = never buy),
-        # adversary stop times T = 1..30, buy cost b = 10
-        f"kd AS (SELECT CAST(doc_id + 1 AS BIGINT) AS k"
-        f" FROM {tbl} WHERE doc_id < 31)",
-        f"td AS (SELECT CAST(doc_id + 1 AS BIGINT) AS t"
-        f" FROM {tbl} WHERE doc_id < 30)",
-        "ct AS (SELECT k.k, t.t,\n"
-        "   CASE WHEN t.t >= k.k THEN k.k - 1 + 10 ELSE t.t"
-        " END AS cost,\n"
-        "   least(t.t, 10) AS opt\n"
-        "  FROM kd k CROSS JOIN td t)",
-        # exact ratios: scale by lcm(1..10) = 2520 — opt
-        # always divides, so the scaled ratio is an integer
-        "rt AS (SELECT k, t, cost * 2520 {d} opt AS rs,\n"
-        "   cost * 2520 - (cost * 2520 {d} opt) * opt AS"
-        " exact_chk\n"
-        "  FROM ct)",
-        "wr AS (SELECT k, CAST(max(rs) AS BIGINT) AS worst,\n"
-        "   CAST(sum(exact_chk) AS BIGINT) AS div_viol\n"
-        "  FROM rt GROUP BY k)",
-        "mm AS (SELECT CAST(min(worst) AS BIGINT) AS minimax,\n"
-        "   CAST(sum(div_viol) AS BIGINT) AS div_viol\n"
-        "  FROM wr)",
-    ]
-    fin = (
-        "SELECT w.k, w.worst,\n"
-        "  CASE WHEN w.worst = m.minimax THEN 1 ELSE 0 END AS"
-        " is_best,\n"
-        "  m.minimax, m.minimax - 4788 AS minimax_viol,\n"
-        "  m.div_viol\n"
-        "FROM wr w CROSS JOIN mm m")
-    return parts, fin
-
-
-def _q754_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q754_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q754_ski_rental",
-       "WITH " + _q754_join("documents", "//", " MATERIALIZED"))
-def q754(spark, sf_dir):
-    """Ski rental (Karlin-Manasse-Rudolph-Sleator 1988 — the
-    rent-vs-buy primitive behind connection keep-alive,
-    spin-vs-block, and cache-admission decisions) with BOTH
-    sides of the deterministic minimax computed from one
-    exhaustive census, in exact integers.  Strategies 'buy on
-    day k' (k = 1..31, 31 = never) against adversary stop
-    times T = 1..30 with buy cost b = 10; ratios are scaled
-    by lcm(1..10) = 2520, which every OPT value divides —
-    div_viol == 0 certifies no ratio ever left the integers.
-    UPPER BOUND: the break-even strategy k = b achieves worst
-    ratio exactly (2b-1)/b = 19/10 (minimax_viol == 0 against
-    the scaled literal 4788).  LOWER BOUND from the same
-    table: every other k is strictly worse (is_best == 1 only
-    at k = 10) — buying early pays b for nothing, buying late
-    rents too long, never-buying drifts to horizon/b = 3.
-    The census IS the classical theorem that no deterministic
-    online algorithm beats 2 - 1/b.  Scale: a 31 x 30
-    cross-join census; fixed cost."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q754_documents")
-    parts, fin = _q754_sql("q754_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q755: stable roommates — existence can FAIL (unlike marriage):
-# the classic 4-agent witness beside a uniquely-solvable instance
-
-
-_Q755_RK = """(0, 1, 2, 0),
-   (0, 1, 3, 1),
-   (0, 1, 4, 2),
-   (0, 2, 3, 0),
-   (0, 2, 1, 1),
-   (0, 2, 4, 2),
-   (0, 3, 1, 0),
-   (0, 3, 2, 1),
-   (0, 3, 4, 2),
-   (0, 4, 1, 0),
-   (0, 4, 2, 1),
-   (0, 4, 3, 2),
-   (1, 1, 6, 0),
-   (1, 1, 2, 1),
-   (1, 1, 5, 2),
-   (1, 1, 3, 3),
-   (1, 1, 4, 4),
-   (1, 2, 4, 0),
-   (1, 2, 5, 1),
-   (1, 2, 3, 2),
-   (1, 2, 6, 3),
-   (1, 2, 1, 4),
-   (1, 3, 5, 0),
-   (1, 3, 4, 1),
-   (1, 3, 1, 2),
-   (1, 3, 2, 3),
-   (1, 3, 6, 4),
-   (1, 4, 2, 0),
-   (1, 4, 3, 1),
-   (1, 4, 1, 2),
-   (1, 4, 6, 3),
-   (1, 4, 5, 4),
-   (1, 5, 2, 0),
-   (1, 5, 3, 1),
-   (1, 5, 6, 2),
-   (1, 5, 4, 3),
-   (1, 5, 1, 4),
-   (1, 6, 4, 0),
-   (1, 6, 5, 1),
-   (1, 6, 3, 2),
-   (1, 6, 1, 3),
-   (1, 6, 2, 4)"""
-
-_Q755_MT = """(0, 0, 1, 2),
-   (0, 0, 2, 1),
-   (0, 0, 3, 4),
-   (0, 0, 4, 3),
-   (0, 1, 1, 3),
-   (0, 1, 3, 1),
-   (0, 1, 2, 4),
-   (0, 1, 4, 2),
-   (0, 2, 1, 4),
-   (0, 2, 4, 1),
-   (0, 2, 2, 3),
-   (0, 2, 3, 2),
-   (1, 0, 1, 2),
-   (1, 0, 2, 1),
-   (1, 0, 3, 4),
-   (1, 0, 4, 3),
-   (1, 0, 5, 6),
-   (1, 0, 6, 5),
-   (1, 1, 1, 2),
-   (1, 1, 2, 1),
-   (1, 1, 3, 5),
-   (1, 1, 5, 3),
-   (1, 1, 4, 6),
-   (1, 1, 6, 4),
-   (1, 2, 1, 2),
-   (1, 2, 2, 1),
-   (1, 2, 3, 6),
-   (1, 2, 6, 3),
-   (1, 2, 4, 5),
-   (1, 2, 5, 4),
-   (1, 3, 1, 3),
-   (1, 3, 3, 1),
-   (1, 3, 2, 4),
-   (1, 3, 4, 2),
-   (1, 3, 5, 6),
-   (1, 3, 6, 5),
-   (1, 4, 1, 3),
-   (1, 4, 3, 1),
-   (1, 4, 2, 5),
-   (1, 4, 5, 2),
-   (1, 4, 4, 6),
-   (1, 4, 6, 4),
-   (1, 5, 1, 3),
-   (1, 5, 3, 1),
-   (1, 5, 2, 6),
-   (1, 5, 6, 2),
-   (1, 5, 4, 5),
-   (1, 5, 5, 4),
-   (1, 6, 1, 4),
-   (1, 6, 4, 1),
-   (1, 6, 2, 3),
-   (1, 6, 3, 2),
-   (1, 6, 5, 6),
-   (1, 6, 6, 5),
-   (1, 7, 1, 4),
-   (1, 7, 4, 1),
-   (1, 7, 2, 5),
-   (1, 7, 5, 2),
-   (1, 7, 3, 6),
-   (1, 7, 6, 3),
-   (1, 8, 1, 4),
-   (1, 8, 4, 1),
-   (1, 8, 2, 6),
-   (1, 8, 6, 2),
-   (1, 8, 3, 5),
-   (1, 8, 5, 3),
-   (1, 9, 1, 5),
-   (1, 9, 5, 1),
-   (1, 9, 2, 3),
-   (1, 9, 3, 2),
-   (1, 9, 4, 6),
-   (1, 9, 6, 4),
-   (1, 10, 1, 5),
-   (1, 10, 5, 1),
-   (1, 10, 2, 4),
-   (1, 10, 4, 2),
-   (1, 10, 3, 6),
-   (1, 10, 6, 3),
-   (1, 11, 1, 5),
-   (1, 11, 5, 1),
-   (1, 11, 2, 6),
-   (1, 11, 6, 2),
-   (1, 11, 3, 4),
-   (1, 11, 4, 3),
-   (1, 12, 1, 6),
-   (1, 12, 6, 1),
-   (1, 12, 2, 3),
-   (1, 12, 3, 2),
-   (1, 12, 4, 5),
-   (1, 12, 5, 4),
-   (1, 13, 1, 6),
-   (1, 13, 6, 1),
-   (1, 13, 2, 4),
-   (1, 13, 4, 2),
-   (1, 13, 3, 5),
-   (1, 13, 5, 3),
-   (1, 14, 1, 6),
-   (1, 14, 6, 1),
-   (1, 14, 2, 5),
-   (1, 14, 5, 2),
-   (1, 14, 3, 4),
-   (1, 14, 4, 3)"""
-
-
-def _q755_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "rk AS (SELECT * FROM (VALUES\n   " + _Q755_RK
-        + ") t(inst, a, b, r))",
-        "mt AS (SELECT * FROM (VALUES\n   " + _Q755_MT
-        + ") t(inst, m, a, p))",
-        # blocking pair: x and y both strictly prefer each
-        # other to their assigned partners
-        "bp AS (SELECT x.inst, x.m, CAST(count(*) AS BIGINT)"
-        " AS nb\n"
-        "  FROM mt x JOIN mt y ON y.inst = x.inst AND y.m ="
-        " x.m\n"
-        "    AND y.a > x.a AND y.a <> x.p\n"
-        "  JOIN rk r1 ON r1.inst = x.inst AND r1.a = x.a AND"
-        " r1.b = y.a\n"
-        "  JOIN rk r2 ON r2.inst = x.inst AND r2.a = x.a AND"
-        " r2.b = x.p\n"
-        "  JOIN rk r3 ON r3.inst = x.inst AND r3.a = y.a AND"
-        " r3.b = x.a\n"
-        "  JOIN rk r4 ON r4.inst = x.inst AND r4.a = y.a AND"
-        " r4.b = y.p\n"
-        "  WHERE r1.r < r2.r AND r3.r < r4.r\n"
-        "  GROUP BY x.inst, x.m)",
-        "al AS (SELECT z.inst, z.m, coalesce(b.nb, 0) AS nb\n"
-        "  FROM (SELECT DISTINCT inst, m FROM mt) z\n"
-        "  LEFT JOIN bp b ON b.inst = z.inst AND b.m = z.m)",
-        "vd AS (SELECT inst, CAST(sum(CASE WHEN nb = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "   AS BIGINT) AS n_stable,\n"
-        "   CAST(count(*) AS BIGINT) AS n_matchings\n"
-        "  FROM al GROUP BY inst)",
-        "sg AS (SELECT inst, m, CAST(sum(CASE WHEN a < p THEN"
-        " a * 8 + p\n"
-        "   ELSE 0 END) AS BIGINT) AS sig FROM mt GROUP BY"
-        " inst, m)",
-    ]
-    fin = (
-        "SELECT a.inst, a.m, a.nb AS n_blocking, s.sig,\n"
-        "  v.n_stable, v.n_matchings\n"
-        "FROM al a JOIN sg s ON s.inst = a.inst AND s.m ="
-        " a.m\n"
-        "JOIN vd v ON v.inst = a.inst")
-    return parts, fin
-
-
-def _q755_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q755_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q755_stable_roommates",
-       "WITH " + _q755_join("documents", "//", " MATERIALIZED"))
-def q755(spark, sf_dir):
-    """Stable roommates (Gale-Shapley 1962, Irving 1985) — the
-    one-sided matching problem where, unlike stable MARRIAGE
-    (q552/q684: always solvable), a stable matching can FAIL
-    TO EXIST; the pairing analogue of allocating co-located
-    shard replicas by mutual preference.  Two instances run
-    through one exhaustive census: the CLASSIC 4-agent witness
-    (cyclic preferences 1->2->3->1 with 4 as everyone's last
-    choice) has ALL THREE perfect matchings blocked — n_stable
-    == 0, each matching's blocking pair countable in the
-    output — Gale and Shapley's original demonstration that
-    the roommates problem is genuinely harder; and a 6-agent
-    instance over all 15 perfect matchings with EXACTLY ONE
-    stable matching ({1-6, 2-4, 3-5}, signature visible in
-    sig), its blocking-pair spectrum 0,1,1,2,... emitted.
-    The blocking-pair predicate is the two-sided strict-
-    preference join, evaluated over every (matching, pair)
-    combination — existence and non-existence both decided by
-    the same relational machine.  Scale: matchings of n
-    agents explode as (n-1)!! — this is the exhaustive
-    certificate regime; Irving's O(n^2) algorithm is the
-    constructive path at scale."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q755_documents")
-    parts, fin = _q755_sql("q755_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q756: semi-join vs Bloom-filter join reduction — bytes-shipped
-# accounting with exact false-positive census
-
-
-def _q756_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "fc AS (SELECT CAST(c_custkey AS BIGINT) AS ck FROM"
-        " customer\n"
-        "  WHERE c_mktsegment = 'BUILDING')",
-        "od AS (SELECT CAST(o_orderkey AS BIGINT) AS ok,\n"
-        "   CAST(o_custkey AS BIGINT) AS ck FROM orders)",
-        # exact match set, twice: semi-join and correlated
-        # EXISTS — two machines, one cardinality
-        "m1 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM od"
-        " o\n"
-        "  JOIN (SELECT DISTINCT ck FROM fc) f ON f.ck ="
-        " o.ck)",
-        "m2 AS (SELECT CAST(count(*) AS BIGINT) AS n FROM od"
-        " o\n"
-        "  WHERE EXISTS (SELECT 1 FROM fc f WHERE f.ck ="
-        " o.ck))",
-        # one-hash Bloom filter, m = 512 bits: set bits from
-        # the build side, probe the orders side — the false
-        # positives counted EXACTLY, and no false negatives by
-        # construction (same key -> same bit)
-        "bb AS (SELECT DISTINCT (ck * 2654435761) % 512 AS"
-        " bit FROM fc)",
-        "ps AS (SELECT CAST(count(*) AS BIGINT) AS passed"
-        " FROM od o\n"
-        "  JOIN bb ON bb.bit = (o.ck * 2654435761) % 512)",
-        "fn AS (SELECT CAST(count(*) AS BIGINT) AS false_neg\n"
-        "  FROM od o JOIN (SELECT DISTINCT ck FROM fc) f ON"
-        " f.ck = o.ck\n"
-        "  LEFT JOIN bb ON bb.bit = (o.ck * 2654435761) %"
-        " 512\n"
-        "  WHERE bb.bit IS NULL)",
-        "nn AS (SELECT CAST(count(*) AS BIGINT) AS n_orders"
-        " FROM od)",
-        "nf AS (SELECT CAST(count(*) AS BIGINT) AS n_build"
-        " FROM fc)",
-        "nb AS (SELECT CAST(count(*) AS BIGINT) AS set_bits"
-        " FROM bb)",
-        # bytes model: 64 B/order row, 8 B/key, 64 B filter
-        "st AS (SELECT s.sid, s.nm,\n"
-        "   CASE s.sid WHEN 0 THEN n.n_orders\n"
-        "        WHEN 1 THEN m.n ELSE p.passed END AS"
-        " rows_shipped,\n"
-        "   CASE s.sid WHEN 0 THEN n.n_orders * 64\n"
-        "        WHEN 1 THEN f.n_build * 8 + m.n * 64\n"
-        "        ELSE 64 + p.passed * 64 END AS bytes_moved\n"
-        "  FROM (SELECT CAST(x AS BIGINT) AS sid,\n"
-        "     CASE x WHEN 0 THEN 'ship_all' WHEN 1 THEN"
-        " 'semi_join'\n"
-        "      ELSE 'bloom' END AS nm\n"
-        "    FROM (VALUES (0), (1), (2)) t(x)) s\n"
-        "  CROSS JOIN nn n CROSS JOIN m1 m CROSS JOIN ps p\n"
-        "  CROSS JOIN nf f)",
-    ]
-    fin = (
-        "SELECT s.sid, s.nm AS strategy, s.rows_shipped,\n"
-        "  s.bytes_moved, m1.n AS n_match,\n"
-        "  m1.n - m2.n AS match_viol,\n"
-        "  p.passed - m1.n AS false_pos, f.false_neg,\n"
-        "  b.set_bits, u.n_build\n"
-        "FROM st s CROSS JOIN m1 CROSS JOIN m2\n"
-        "CROSS JOIN ps p CROSS JOIN fn f CROSS JOIN nb b\n"
-        "CROSS JOIN nf u")
-    return parts, fin
-
-
-def _q756_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q756_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q756_semijoin_bloom",
-       "WITH " + _q756_join("documents", "//", " MATERIALIZED"))
-def q756(spark, sf_dir):
-    """Semi-join vs Bloom-filter join reduction (Bernstein-Chiu
-    1981; runtime row-filters in every modern warehouse — the
-    single most important shuffle-minimization lever at 100 TB)
-    with exact bytes-shipped accounting on the real
-    orders/customer join.  The match cardinality is computed by
-    TWO machines — a distinct-key semi-join and a correlated
-    EXISTS — certified equal (match_viol == 0).  The one-hash
-    512-bit Bloom filter is evaluated EXACTLY, not
-    probabilistically: set bits from the build side, probe per
-    order, false positives counted by subtraction and false
-    NEGATIVES proven zero by census (same key hashes to the
-    same bit — the Bloom guarantee as data).  The three
-    shipping strategies (ship-all, semi-join keys+matches,
-    filter+passed) land in one cost table under a fixed byte
-    model — at BUILDING selectivity ~23% the reductions beat
-    ship-all by ~4x while the Bloom false positives cost only
-    what the census says they cost.  Scale: this is the
-    broadcast-the-small-side decision this engine's spatial
-    joins make (operators/spatial_join.py); the census shape
-    is a grouped aggregate."""
-    for t in ("customer", "orders"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    parts, fin = _q756_sql("documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q757: the Q21 shape — unique-late-supplier detection via
-# correlated EXISTS / NOT EXISTS, cross-checked by aggregation
-
-
-def _q757_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "l2 AS{mat} (SELECT CAST(l.l_orderkey AS BIGINT) AS"
-        " ok,\n"
-        "   CAST(l.l_suppkey AS BIGINT) AS sk,\n"
-        "   CAST(max(CASE WHEN l.l_shipdate > o.o_orderdate +"
-        " INTERVAL 90 DAY\n"
-        "     THEN 1 ELSE 0 END) AS BIGINT) AS late\n"
-        "  FROM lineitem l JOIN orders o ON o.o_orderkey ="
-        " l.l_orderkey\n"
-        "  GROUP BY l.l_orderkey, l.l_suppkey)",
-        # machine A: the classical correlated form — another
-        # supplier EXISTS, another LATE supplier does NOT
-        "ma AS (SELECT a.sk, CAST(count(*) AS BIGINT) AS"
-        " waits\n"
-        "  FROM l2 a WHERE a.late = 1\n"
-        "  AND EXISTS (SELECT 1 FROM l2 b WHERE b.ok = a.ok"
-        " AND b.sk <> a.sk)\n"
-        "  AND NOT EXISTS (SELECT 1 FROM l2 c WHERE c.ok ="
-        " a.ok\n"
-        "    AND c.sk <> a.sk AND c.late = 1)\n"
-        "  GROUP BY a.sk)",
-        # machine B: the aggregate form — per-order supplier
-        # and late-supplier counts
-        "ag AS (SELECT ok, CAST(count(*) AS BIGINT) AS ns,\n"
-        "   CAST(sum(late) AS BIGINT) AS nl FROM l2 GROUP BY"
-        " ok)",
-        "mb AS (SELECT a.sk, CAST(count(*) AS BIGINT) AS"
-        " waits\n"
-        "  FROM l2 a JOIN ag g ON g.ok = a.ok\n"
-        "  WHERE a.late = 1 AND g.ns >= 2 AND g.nl = 1\n"
-        "  GROUP BY a.sk)",
-        "gq AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " n_qual_orders\n"
-        "  FROM ag WHERE ns >= 2 AND nl = 1)",
-        "xv AS (SELECT CAST(sum(CASE WHEN coalesce(a.waits,"
-        " -1) <>\n"
-        "   coalesce(b.waits, -2) THEN 1 ELSE 0 END) AS"
-        " BIGINT) AS machine_viol\n"
-        "  FROM ma a FULL OUTER JOIN mb b ON b.sk = a.sk)",
-    ]
-    fin = (
-        "SELECT t.sk, t.waits, g.n_qual_orders,"
-        " x.machine_viol\n"
-        "FROM (SELECT sk, waits, row_number() OVER (ORDER BY"
-        " waits DESC, sk)\n"
-        "   AS rnk FROM mb) t\n"
-        "CROSS JOIN gq g CROSS JOIN xv x\n"
-        "WHERE t.rnk <= 10")
-    return parts, fin
-
-
-def _q757_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q757_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q757_unique_late_supplier",
-       "WITH " + _q757_join("documents", "//", " MATERIALIZED"))
-def q757(spark, sf_dir):
-    """The TPC-H Q21 shape — 'suppliers who kept orders
-    waiting' — adapted to this schema (late = shipped more
-    than 90 days after the order date) and computed by TWO
-    independent machines certified equal.  Machine A is the
-    classical correlated form: a late supplier such that
-    another supplier EXISTS on the order and another late
-    supplier does NOT — the double-correlated-subquery pattern
-    that separates real optimizers from toy ones (both
-    engines decorrelate it to anti/semi joins).  Machine B is
-    the aggregate form: per-order supplier and late-supplier
-    counts, filter ns >= 2 and nl == 1 — the shape a
-    Spark-first rewrite should prefer (one grouped pass, no
-    correlation).  A FULL OUTER JOIN of the two result sets
-    certifies them identical supplier-for-supplier
-    (machine_viol == 0), with the qualifying-order count
-    emitted.  Top-10 waiting suppliers returned.  Scale:
-    machine B is one groupBy over (order, supplier) — linear,
-    shuffle on the natural key; the lesson is that B computes
-    what A specifies at a fraction of the plan complexity."""
-    for t in ("lineitem", "orders"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    parts, fin = _q757_sql("documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-    _ckpt_view(spark,
-               frags["l2"].split(" AS ", 1)[1].strip()[1:-1],
-               "q757_l2")
-    kept = [re.sub(r"\bl2\b", "q757_l2", frags[n])
-            for n in ("ma", "ag", "mb", "gq", "xv")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q758: grid spatial join with reference-point dedup — report-once
-# certified against the brute-force pairwise join
-
-
-def _q758_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # two integer-coordinate rectangle layers: A from
-        # nation keys (25 rects), B from part keys (48 rects)
-        "ra AS (SELECT CAST(n_nationkey AS BIGINT) AS aid,\n"
-        "   CAST((n_nationkey * 61) % 300 - 160 AS BIGINT) AS"
-        " xmin,\n"
-        "   CAST((n_nationkey * 61) % 300 - 160 + 24 +"
-        " (n_nationkey * 7) % 40 AS BIGINT) AS xmax,\n"
-        "   CAST((n_nationkey * 37) % 120 - 70 AS BIGINT) AS"
-        " ymin,\n"
-        "   CAST((n_nationkey * 37) % 120 - 70 + 18 +"
-        " (n_nationkey * 11) % 30 AS BIGINT) AS ymax\n"
-        "  FROM nation)",
-        "rb AS (SELECT CAST(p_partkey AS BIGINT) AS bid,\n"
-        "   CAST((p_partkey * 53) % 320 - 170 AS BIGINT) AS"
-        " xmin,\n"
-        "   CAST((p_partkey * 53) % 320 - 170 + 16 +"
-        " (p_partkey * 13) % 36 AS BIGINT) AS xmax,\n"
-        "   CAST((p_partkey * 41) % 130 - 76 AS BIGINT) AS"
-        " ymin,\n"
-        "   CAST((p_partkey * 41) % 130 - 76 + 12 +"
-        " (p_partkey * 17) % 28 AS BIGINT) AS ymax\n"
-        "  FROM part WHERE p_partkey < 48)",
-        # 20-unit grid cells covering [-180,180] x [-100,100]
-        f"cx AS (SELECT CAST(doc_id AS BIGINT) - 9 AS gx"
-        f" FROM {tbl} WHERE doc_id < 18)",
-        f"cy AS (SELECT CAST(doc_id AS BIGINT) - 5 AS gy"
-        f" FROM {tbl} WHERE doc_id < 10)",
-        # cell cover of each rect (cells it overlaps)
-        "ca AS{mat} (SELECT a.aid, x.gx, y.gy, a.xmin,"
-        " a.xmax, a.ymin, a.ymax\n"
-        "  FROM ra a JOIN cx x ON x.gx * 20 < a.xmax AND"
-        " (x.gx + 1) * 20 > a.xmin\n"
-        "  JOIN cy y ON y.gy * 20 < a.ymax AND (y.gy + 1) *"
-        " 20 > a.ymin)",
-        "cb AS{mat} (SELECT b.bid, x.gx, y.gy, b.xmin,"
-        " b.xmax, b.ymin, b.ymax\n"
-        "  FROM rb b JOIN cx x ON x.gx * 20 < b.xmax AND"
-        " (x.gx + 1) * 20 > b.xmin\n"
-        "  JOIN cy y ON y.gy * 20 < b.ymax AND (y.gy + 1) *"
-        " 20 > b.ymin)",
-        # candidate pairs via the cell equi-join; a pair
-        # appears once PER SHARED CELL — the duplication the
-        # reference-point rule exists to kill
-        "cd AS{mat} (SELECT a.aid, b.bid, a.gx, a.gy,\n"
-        "   greatest(a.xmin, b.xmin) AS rx, greatest(a.ymin,"
-        " b.ymin) AS ry\n"
-        "  FROM ca a JOIN cb b ON b.gx = a.gx AND b.gy ="
-        " a.gy\n"
-        "  WHERE a.xmin < b.xmax AND b.xmin < a.xmax\n"
-        "    AND a.ymin < b.ymax AND b.ymin < a.ymax)",
-        "rp AS (SELECT aid, bid FROM cd\n"
-        "  WHERE rx >= gx * 20 AND rx < (gx + 1) * 20\n"
-        "    AND ry >= gy * 20 AND ry < (gy + 1) * 20)",
-        # ground truth: brute-force pairwise intersection
-        "bf AS (SELECT a.aid, b.bid FROM ra a CROSS JOIN rb"
-        " b\n"
-        "  WHERE a.xmin < b.xmax AND b.xmin < a.xmax\n"
-        "    AND a.ymin < b.ymax AND b.ymin < a.ymax)",
-        "ct AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM cd) AS"
-        " n_candidates,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM rp) AS"
-        " n_refpoint,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM bf) AS"
-        " n_bruteforce,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM\n"
-        "     (SELECT aid, bid FROM rp\n"
-        "      UNION ALL SELECT aid, bid FROM bf) z\n"
-        "    GROUP BY aid, bid HAVING count(*) <> 2 LIMIT 1)"
-        " AS mismatch_probe)",
-    ]
-    fin = (
-        "SELECT r.aid, r.bid, c.n_candidates, c.n_refpoint,\n"
-        "  c.n_bruteforce,\n"
-        "  c.n_refpoint - c.n_bruteforce AS refpoint_viol,\n"
-        "  coalesce(c.mismatch_probe, 0) AS pair_set_viol\n"
-        "FROM rp r CROSS JOIN ct c\n"
-        "WHERE r.aid < 6")
-    return parts, fin
-
-
-def _q758_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q758_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q758_refpoint_dedup",
-       "WITH " + _q758_join("documents", "//", " MATERIALIZED"))
-def q758(spark, sf_dir):
-    """The REFERENCE-POINT technique (Dittrich-Seeger 2000 —
-    how every distributed spatial join reports each result
-    pair exactly once WITHOUT a global distinct) certified
-    against brute force.  Grid cover joins duplicate a
-    candidate pair once per shared cell; the fix is to emit
-    the pair only from the single cell containing the
-    intersection's reference point (its lower-left corner,
-    max of the mins) — a pure local predicate, no shuffle, no
-    distinct.  Certified: the reference-point output has
-    exactly the brute-force pairwise cardinality
-    (refpoint_viol == 0) AND the exact same pair SET (the
-    union-counting probe, pair_set_viol == 0), while the raw
-    candidate count shows the duplication a naive cell join
-    would suffer.  This is the dedup rule the engine's
-    spatial_join operators (q11/q12/q124) rely on at scale —
-    here isolated and proven on integer rectangles where
-    every intersection is exact.  Scale: the reference-point
-    filter is evaluated per candidate row — O(candidates),
-    embarrassingly parallel, versus the sort/shuffle a
-    DISTINCT over pair keys would cost at 10^12 pairs."""
-    for t in ("nation", "part"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q758_documents")
-    parts, fin = _q758_sql("q758_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q759: tile-clip area conservation — the tiling engine's
-# fundamental invariant, exact on half-open integer tiles
-
-
-def _q759_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "ra AS (SELECT CAST(n_nationkey AS BIGINT) AS aid,\n"
-        "   CAST((n_nationkey * 61) % 300 - 160 AS BIGINT) AS"
-        " xmin,\n"
-        "   CAST((n_nationkey * 61) % 300 - 160 + 24 +"
-        " (n_nationkey * 7) % 40 AS BIGINT) AS xmax,\n"
-        "   CAST((n_nationkey * 37) % 120 - 70 AS BIGINT) AS"
-        " ymin,\n"
-        "   CAST((n_nationkey * 37) % 120 - 70 + 18 +"
-        " (n_nationkey * 11) % 30 AS BIGINT) AS ymax\n"
-        "  FROM nation)",
-        f"cx AS (SELECT CAST(doc_id AS BIGINT) - 9 AS gx"
-        f" FROM {tbl} WHERE doc_id < 18)",
-        f"cy AS (SELECT CAST(doc_id AS BIGINT) - 5 AS gy"
-        f" FROM {tbl} WHERE doc_id < 10)",
-        # clip each rect to each overlapped half-open tile
-        "cl AS{mat} (SELECT a.aid, x.gx, y.gy,\n"
-        "   least(a.xmax, (x.gx + 1) * 20) - greatest(a.xmin,"
-        " x.gx * 20) AS w,\n"
-        "   least(a.ymax, (y.gy + 1) * 20) - greatest(a.ymin,"
-        " y.gy * 20) AS h\n"
-        "  FROM ra a JOIN cx x ON x.gx * 20 < a.xmax AND"
-        " (x.gx + 1) * 20 > a.xmin\n"
-        "  JOIN cy y ON y.gy * 20 < a.ymax AND (y.gy + 1) *"
-        " 20 > a.ymin)",
-        # per-feature conservation: clipped pieces sum back to
-        # the exact original area
-        "cons AS (SELECT c.aid,\n"
-        "   CAST(sum(c.w * c.h) AS BIGINT) AS clipped_area,\n"
-        "   CAST(count(*) AS BIGINT) AS n_tiles\n"
-        "  FROM cl c GROUP BY c.aid)",
-        "cv AS (SELECT CAST(sum(CASE WHEN o.clipped_area <>\n"
-        "   (a.xmax - a.xmin) * (a.ymax - a.ymin) THEN 1 ELSE"
-        " 0 END)\n"
-        "   AS BIGINT) AS cons_viol\n"
-        "  FROM ra a JOIN cons o ON o.aid = a.aid)",
-        # positivity: a cover join must never emit an empty
-        # clip (half-open tiles + strict overlap predicate)
-        "pv AS (SELECT CAST(sum(CASE WHEN w <= 0 OR h <= 0"
-        " THEN 1 ELSE 0 END)\n"
-        "   AS BIGINT) AS empty_viol FROM cl)",
-        # tile density surface: total clipped area per tile —
-        # the web-density raster this engine materializes
-        "td AS (SELECT gx, gy, CAST(sum(w * h) AS BIGINT) AS"
-        " den,\n"
-        "   CAST(count(*) AS BIGINT) AS n_feat\n"
-        "  FROM cl GROUP BY gx, gy)",
-        "gt AS (SELECT CAST(sum(den) AS BIGINT) AS tot_tile\n"
-        "  FROM td)",
-        "ga AS (SELECT CAST(sum((xmax - xmin) * (ymax -"
-        " ymin)) AS BIGINT)\n"
-        "   AS tot_area FROM ra)",
-    ]
-    fin = (
-        "SELECT t.gx, t.gy, t.den, t.n_feat,\n"
-        "  v.cons_viol, p.empty_viol,\n"
-        "  g.tot_tile - a.tot_area AS global_viol\n"
-        "FROM (SELECT gx, gy, den, n_feat, row_number() OVER\n"
-        "   (ORDER BY den DESC, gx, gy) AS rnk FROM td) t\n"
-        "CROSS JOIN cv v CROSS JOIN pv p\n"
-        "CROSS JOIN gt g CROSS JOIN ga a\n"
-        "WHERE t.rnk <= 12")
-    return parts, fin
-
-
-def _q759_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q759_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q759_tile_clip_conservation",
-       "WITH " + _q759_join("documents", "//", " MATERIALIZED"))
-def q759(spark, sf_dir):
-    """Tile-clip AREA CONSERVATION — the fundamental invariant
-    of every tiled pipeline this engine ships (q14/q15 density
-    rasters, q210/q482 MVT tiles, the manifest'd tile sinks):
-    clipping a feature to a half-open tile grid must neither
-    lose nor double-count a single square unit.  Integer
-    rectangles clip to 20-unit half-open tiles with
-    least/greatest arithmetic; certificates: (1) per-feature
-    conservation — the clipped pieces of every rect sum back
-    EXACTLY to its area (cons_viol == 0; this fails the
-    moment tiles are closed on both edges — boundary strips
-    double-count); (2) the cover join never emits an empty
-    clip (empty_viol == 0 — strict-inequality overlap
-    predicate); (3) global conservation — the tile density
-    surface totals exactly the layer's area (global_viol ==
-    0).  The top-density tiles are the query's payload: the
-    web-density raster, now carrying its own proof that
-    nothing was dropped at tile seams.  Scale: clip+aggregate
-    is one map-side pass per (feature, tile) — the identical
-    shape at a billion features; conservation stays checkable
-    per partition and globally."""
-    _t(spark, sf_dir, "nation").createOrReplaceTempView(
-        "nation")
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q759_documents")
-    parts, fin = _q759_sql("q759_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q760: ISO 8601 week dates — the Thursday rule at year
-# boundaries, certified against Python's isocalendar
-
-
-def _q760_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 500 dates in two windows straddling the 2020-W53
-        # long year (2021-01-01 is a Friday of ISO 2020) and
-        # the 2024->2025 boundary (2024-12-30 is ISO 2025-W01);
-        # base 2019-12-20 is an ISO Friday (dow 5), so isodow
-        # is pure integer arithmetic on the day offset
-        f"dd AS (SELECT CAST(doc_id AS BIGINT) AS i,\n"
-        f"   CAST(CASE WHEN doc_id < 250 THEN doc_id + 230"
-        f" ELSE doc_id + 1580 END AS BIGINT) AS n\n"
-        f"  FROM {tbl} WHERE doc_id < 500)",
-        "dt AS{mat} (SELECT i, n,\n"
-        "   DATE '2019-12-20' + CAST(n AS INT) * INTERVAL 1"
-        " DAY AS dte,\n"
-        "   ((5 - 1 + n) % 7) + 1 AS isodow\n"
-        "  FROM dd)",
-        # the Thursday rule: a date's ISO year/week are those
-        # of the Thursday of its week
-        "th AS (SELECT i, n, dte, isodow,\n"
-        "   dte + CAST(4 - isodow AS INT) * INTERVAL 1 DAY AS"
-        " thu\n"
-        "  FROM dt)",
-        "iso AS (SELECT i, n, isodow,\n"
-        "   CAST(year(dte) AS BIGINT) AS cal_year,\n"
-        "   CAST(month(dte) AS BIGINT) AS cal_month,\n"
-        "   CAST(day(dte) AS BIGINT) AS cal_day,\n"
-        "   CAST(year(thu) AS BIGINT) AS iso_year,\n"
-        "   CAST((dayofyear(thu) - 1) {d} 7 + 1 AS BIGINT) AS"
-        " iso_week\n"
-        "  FROM th)",
-        "py AS (SELECT i, iso_year AS py_year, iso_week AS"
-        " py_week,\n"
-        "   isodow AS py_dow FROM iso)",
-        "ag AS (SELECT\n"
-        "   CAST(sum(CASE WHEN iso_year <> cal_year THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) AS n_boundary,\n"
-        "   CAST(sum(CASE WHEN iso_week = 53 THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS n_w53 FROM iso)",
-    ]
-    fin = (
-        "SELECT s.i, s.cal_year, s.cal_month, s.cal_day,\n"
-        "  s.isodow, s.iso_year, s.iso_week,\n"
-        "  y.py_year, y.py_week, y.py_dow,\n"
-        "  CASE WHEN s.iso_year = y.py_year AND s.iso_week ="
-        " y.py_week\n"
-        "   AND s.isodow = y.py_dow THEN 1 ELSE 0 END AS"
-        " agree,\n"
-        "  g.n_boundary, g.n_w53\n"
-        "FROM iso s JOIN py y ON y.i = s.i\n"
-        "CROSS JOIN ag g\n"
-        "WHERE s.iso_year <> s.cal_year OR s.iso_week >= 53")
-    return parts, fin
-
-
-def _q760_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q760_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q760_iso_week_dates",
-       "WITH " + _q760_join("documents", "//", " MATERIALIZED"))
-def q760(spark, sf_dir):
-    """ISO 8601 week dates — the Thursday rule computed
-    relationally and certified against CPython's real
-    isocalendar() at exactly the dates that break naive
-    implementations.  A date's ISO year and week are those of
-    the THURSDAY of its Monday-based week: so 2021-01-01
-    (Friday) belongs to ISO 2020-W53 (2020 is a 53-week long
-    year) and 2024-12-30 (Monday) to ISO 2025-W01 — the
-    boundary set every weekly crawl-cohort report either gets
-    right or silently splits across two buckets.  The
-    relational machine computes isodow by pure integer
-    arithmetic on the day offset from a known ISO-Friday
-    epoch (no engine dow function — Spark and DuckDB disagree
-    on week-start conventions), applies the Thursday shift
-    with interval arithmetic, and reads iso_year/iso_week as
-    year/dayofyear of the Thursday.  The ENGINE's py_* columns
-    come from genuinely calling date.isocalendar() per row in
-    one applyInPandas pass — comparator-enforced agreement on
-    all 500 dates (agree == 1 on every emitted boundary row),
-    with the boundary and week-53 censuses emitted.  Scale:
-    pure Column arithmetic; the pandas check is the
-    certificate, not the path."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q760_documents")
-    parts, fin = _q760_sql("q760_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def _replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        import datetime
-        base = datetime.date(2019, 12, 20)
-        out = []
-        for r in pdf.itertuples():
-            dte = base + datetime.timedelta(days=int(r.n))
-            iy, iw, idw = dte.isocalendar()
-            out.append((int(r.i), iy, iw, idw))
-        return pd.DataFrame(
-            out, columns=["i", "py_year", "py_week", "py_dow"])
-
-    spark.sql("WITH " + frags["dd"] + "\nSELECT i, n FROM dd") \
-        .groupBy("i").applyInPandas(
-            _replay,
-            "i long, py_year long, py_week long, py_dow long") \
-        .createOrReplaceTempView("q760_py")
-    kept = [frags[n] for n in ("dd", "dt", "th", "iso", "ag")]
-    return spark.sql(
-        "WITH " + ",\n       ".join(kept) + "\n"
-        + fin.replace("JOIN py y", "JOIN q760_py y"))
-
-
-# ---------------------------------------------------------------------------
-# q761: sessionization threshold curve — session counts by two
-# machines plus the gap-census closed form
-
-
-def _q761_sql(tbl: str, d: str, mat: str, es: str):
-    parts = [
-        f"ev AS{{mat}} (SELECT CAST(user_id AS BIGINT) AS u,\n"
-        f"   {es} AS es FROM events)",
-        "gp AS{mat} (SELECT u, es,\n"
-        "   es - lag(es) OVER (PARTITION BY u ORDER BY es)"
-        " AS gap\n"
-        "  FROM ev)",
-        "td AS (SELECT CAST(x AS BIGINT) AS theta FROM"
-        " (VALUES (60), (300), (1800)) t(x))",
-        # machine A: assign session ids by cumulative
-        # new-session flags, then count distinct sessions
-        "sa AS (SELECT theta, CAST(count(*) AS BIGINT) AS"
-        " n_sessions_a FROM\n"
-        "  (SELECT theta, u, sid FROM\n"
-        "    (SELECT t.theta AS theta, g.u AS u,\n"
-        "       sum(CASE WHEN g.gap IS NULL OR g.gap >"
-        " t.theta THEN 1 ELSE 0 END)\n"
-        "         OVER (PARTITION BY t.theta, g.u ORDER BY"
-        " g.es\n"
-        "          ROWS BETWEEN UNBOUNDED PRECEDING AND"
-        " CURRENT ROW) AS sid\n"
-        "     FROM gp g CROSS JOIN td t) w\n"
-        "   GROUP BY theta, u, sid) z\n"
-        "  GROUP BY theta)",
-        # machine B: the closed form — sessions = users +
-        # gaps exceeding theta
-        "sb AS (SELECT t.theta,\n"
-        "   (SELECT CAST(count(DISTINCT u) AS BIGINT) FROM"
-        " ev) +\n"
-        "   CAST(sum(CASE WHEN g.gap > t.theta THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS n_sessions_b\n"
-        "  FROM gp g CROSS JOIN td t WHERE g.gap IS NOT"
-        " NULL\n"
-        "  GROUP BY t.theta)",
-        "nu AS (SELECT CAST(count(DISTINCT u) AS BIGINT) AS"
-        " n_users,\n"
-        "   CAST(count(*) AS BIGINT) AS n_events FROM ev)",
-    ]
-    fin = (
-        "SELECT a.theta, a.n_sessions_a, b.n_sessions_b,\n"
-        "  a.n_sessions_a - b.n_sessions_b AS machine_viol,\n"
-        "  u.n_users, u.n_events\n"
-        "FROM sa a JOIN sb b ON b.theta = a.theta\n"
-        "CROSS JOIN nu u")
-    return parts, fin
-
-
-def _q761_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q761_sql(tbl, d, mat,
-                           "CAST(floor(epoch(ts)) AS BIGINT)")
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q761_session_threshold_curve",
-       "WITH " + _q761_join("documents", "//", " MATERIALIZED"))
-def q761(spark, sf_dir):
-    """The sessionization threshold curve — how many sessions
-    the events table holds at inactivity gaps of 60 s, 5 min
-    and 30 min — computed by TWO structurally different
-    machines certified equal at every threshold.  Machine A
-    is the production shape (the engine's q10/q50 sessionize
-    family): flag session starts (first event or gap > theta),
-    assign ids by a windowed cumulative sum, count distinct
-    (user, session).  Machine B is the closed form that makes
-    threshold SWEEPS cheap: sessions(theta) = n_users +
-    #(gaps > theta) — one gap census answers every theta
-    without re-sessionizing, because the session count is a
-    step function with breakpoints exactly at the distinct
-    gap values.  machine_viol == 0 at all three thresholds is
-    the identity; the monotone descent of the curve falls out
-    of the census.  Engine note: epoch seconds come from
-    unix_timestamp() on the engine and floor(epoch()) in the
-    oracle — the q317 two-dialect seam, isolated in one
-    column.  Scale: machine B turns an O(T x n log n)
-    threshold sweep into one O(n) census — the difference
-    between re-shuffling per threshold and answering from a
-    cached gap table."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
-        "events")
-    parts, fin = _q761_sql("events", "div", "",
-                           "CAST(unix_timestamp(ts) AS"
-                           " BIGINT)")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q762: Smith-Waterman local alignment — direct DP vs the
-# prefix-max closed-form column recursion, cell-for-cell
-
-
-_Q762_ORACLE = """
-WITH RECURSIVE
-pr AS MATERIALIZED (SELECT CAST(a.doc_id // 2 AS BIGINT) AS pair_id,
-        substr(a.text, 1, 20) AS sa,
-        substr(b.text, 1, 6) || substr(a.text, 5, 9) ||
-          substr(b.text, 15, 5) AS sb
-       FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-       WHERE a.doc_id % 2 = 0 AND a.doc_id < 16),
-dp AS (SELECT pair_id, CAST(0 AS BIGINT) AS j,
-        list_transform(range(0, 21), i -> CAST(0 AS BIGINT)) AS col,
-        sa, sb
-       FROM pr
-       UNION ALL
-       -- SW column: mm[k] = max(diag, left-1); the vertical
-       -- -1 gap chain is closed-formed as a prefix-max of
-       -- mm[k]+k, and the 0 floor absorbs empty alignments
-       SELECT pair_id, j + 1,
-        list_transform(range(0, 21), i ->
-          CASE WHEN i = 0 THEN CAST(0 AS BIGINT)
-          ELSE greatest(CAST(0 AS BIGINT),
-            list_max(list_transform(range(1, i + 1), k ->
-              greatest(col[k] + CASE WHEN substr(sa, k, 1) =
-                  substr(sb, CAST(j AS INT) + 1, 1)
-                THEN 2 ELSE -1 END,
-                col[k + 1] - 1) + k)) - i)
-          END),
-        sa, sb
-       FROM dp WHERE j < 20),
-id AS (SELECT CAST(doc_id AS BIGINT) AS i FROM documents
-       WHERE doc_id < 21),
-cells AS (SELECT d.pair_id, d.j, i.i,
-        d.col[CAST(i.i AS INT) + 1] AS h
-       FROM dp d JOIN id i ON 1 = 1),
-bst AS (SELECT pair_id,
-        CAST(max(h * 4194304 + (2047 - i) * 2048 + (2047 - j))
-          AS BIGINT) AS pk,
-        CAST(sum(CASE WHEN h > 0 THEN 1 ELSE 0 END) AS BIGINT)
-          AS n_pos
-       FROM cells GROUP BY pair_id)
-SELECT pair_id,
-  pk // 4194304 AS best,
-  2047 - (pk % 4194304) // 2048 AS end_i,
-  2047 - pk % 2048 AS end_j,
-  n_pos
-FROM bst
-"""
-
-
-@query("q762_smith_waterman", _Q762_ORACLE)
-def q762(spark, sf_dir):
-    """Smith-Waterman local alignment (Smith-Waterman 1981 —
-    the local-similarity primitive that finds SHARED SPANS
-    between near-duplicate documents where global edit
-    distance only reports how different the wholes are) with
-    two structurally different machines agreeing cell-derived
-    answer for answer.  Eight 20-char pairs each embed a
-    9-char span of string A inside unrelated B context
-    (match +2 / mismatch -1 / gap -1); the zero floor is what
-    makes the alignment LOCAL.  The ENGINE runs the textbook
-    double-loop DP per pair in applyInPandas; the ORACLE
-    never materializes the quadratic dependency — each column
-    is a pure list comprehension via the prefix-max closed
-    form (the vertical gap chain telescopes as
-    max_k(mm[k]+k) - i, validated cell-for-cell against the
-    DP on 200 random pairs at design time; the q736 trick
-    generalized to a floored recurrence).  Compared: best
-    score, its FIRST-maximum cell (packed score/i/j argmax —
-    the tie rule is part of the spec), and the positive-cell
-    census.  Scale: per-entity recurrence template; pairs
-    distribute, columns are O(m) closed-form lists."""
-    docs = _t(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("q762_documents")
-    pr = spark.sql(
-        "SELECT CAST(a.doc_id div 2 AS BIGINT) AS pair_id,\n"
-        "  substr(a.text, 1, 20) AS sa,\n"
-        "  substr(b.text, 1, 6) || substr(a.text, 5, 9) ||\n"
-        "    substr(b.text, 15, 5) AS sb\n"
-        "FROM q762_documents a JOIN q762_documents b\n"
-        "  ON b.doc_id = a.doc_id + 1\n"
-        "WHERE a.doc_id % 2 = 0 AND a.doc_id < 16")
-
-    def _sw(pdf: pd.DataFrame) -> pd.DataFrame:
-        sa = pdf["sa"].iloc[0]
-        sb = pdf["sb"].iloc[0]
-        pid = int(pdf["pair_id"].iloc[0])
-        m, n = len(sa), len(sb)
-        H = [[0] * (n + 1) for _ in range(m + 1)]
-        pk = 0
-        npos = 0
-        for j in range(1, n + 1):
-            for i in range(1, m + 1):
-                s = 2 if sa[i - 1] == sb[j - 1] else -1
-                h = max(0, H[i - 1][j - 1] + s,
-                        H[i - 1][j] - 1, H[i][j - 1] - 1)
-                H[i][j] = h
-                if h > 0:
-                    npos += 1
-                key = h * 4194304 + (2047 - i) * 2048 \
-                    + (2047 - j)
-                pk = max(pk, key)
-        # include the h = 0 cells of the packed key domain:
-        # the all-zero case packs (0, i=2047.. ) — replicate
-        # the oracle's max over ALL cells including zeros
-        for j in range(0, n + 1):
-            for i in range(0, m + 1):
-                if j >= 1 and i >= 1:
-                    continue
-                key = 0 * 4194304 + (2047 - i) * 2048 \
-                    + (2047 - j)
-                pk = max(pk, key)
-        best = pk // 4194304
-        ei = 2047 - (pk % 4194304) // 2048
-        ej = 2047 - pk % 2048
-        return pd.DataFrame(
-            {"pair_id": [pid], "best": [best], "end_i": [ei],
-             "end_j": [ej], "n_pos": [npos]})
-
-    return pr.groupBy("pair_id").applyInPandas(
-        _sw, "pair_id long, best long, end_i long,"
-        " end_j long, n_pos long")
-
-
-# ---------------------------------------------------------------------------
-# q763: two-phase commit — atomicity on completed runs, and the
-# BLOCKING theorem as an indistinguishability certificate
-
-
-_Q763_LOGS = ",\n   ".join(
-    # (hist, actor, seq, ev): 1 req, 2 yes, 3 no, 4 prepared,
-    # 5 commit_msg, 6 abort_msg, 7 ack, 10 log_commit,
-    # 11 log_abort, 12 crash
-    [f"(0, {p}, {s}, {e})" for p in (1, 2, 3)
-     for s, e in enumerate((1, 2, 4, 5, 7), 1)]
-    + ["(0, 0, 1, 10)"]
-    + [f"(1, {p}, {s}, {e})" for p in (1, 3)
-       for s, e in enumerate((1, 2, 4, 6, 7), 1)]
-    + [f"(1, 2, {s}, {e})" for s, e in
-       enumerate((1, 3, 6, 7), 1)]
-    + ["(1, 0, 1, 11)"]
-    + [f"(2, {p}, {s}, {e})" for p in (1, 2, 3)
-       for s, e in enumerate((1, 2, 4), 1)]
-    + ["(2, 0, 1, 10)", "(2, 0, 2, 12)"]
-    + [f"(3, {p}, {s}, {e})" for p in (1, 2, 3)
-       for s, e in enumerate((1, 2, 4), 1)]
-    + ["(3, 0, 1, 11)", "(3, 0, 2, 12)"])
-
-
-def _q763_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "lg AS (SELECT * FROM (VALUES\n   " + _Q763_LOGS
-        + ") t(hist, actor, seq, ev))",
-        # participant end states from decision messages
-        "st AS (SELECT hist, actor,\n"
-        "   CAST(max(CASE WHEN ev = 5 THEN 1 WHEN ev = 6 THEN"
-        " 2 ELSE 0 END)\n"
-        "     AS BIGINT) AS decided\n"
-        "  FROM lg WHERE actor > 0 GROUP BY hist, actor)",
-        "oc AS (SELECT hist,\n"
-        "   CAST(max(CASE WHEN ev = 10 THEN 1 WHEN ev = 11"
-        " THEN 2 ELSE 0 END)\n"
-        "     AS BIGINT) AS outcome\n"
-        "  FROM lg WHERE actor = 0 GROUP BY hist)",
-        # atomicity on completed histories: all participants
-        # share one decision, matching the coordinator's
-        "at2 AS (SELECT CAST(sum(CASE WHEN s.hist <= 1 AND\n"
-        "   s.decided <> o.outcome THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "   AS atomicity_viol\n"
-        "  FROM st s JOIN oc o ON o.hist = s.hist)",
-        # validity: a NO vote forces abort
-        "vl AS (SELECT CAST(sum(CASE WHEN n.has_no = 1 AND\n"
-        "   o.outcome = 1 THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " validity_viol\n"
-        "  FROM (SELECT hist, CAST(max(CASE WHEN ev = 3 THEN"
-        " 1 ELSE 0 END)\n"
-        "     AS BIGINT) AS has_no FROM lg GROUP BY hist) n\n"
-        "  JOIN oc o ON o.hist = n.hist)",
-        # the blocking theorem: histories 2 and 3 have
-        # IDENTICAL participant views but different coordinator
-        # decisions — no local rule can decide
-        "vw AS (SELECT CAST(count(*) AS BIGINT) AS view_diff\n"
-        "  FROM (SELECT actor, seq, ev FROM lg WHERE hist = 2"
-        " AND actor > 0) a\n"
-        "  FULL OUTER JOIN (SELECT actor, seq, ev FROM lg\n"
-        "    WHERE hist = 3 AND actor > 0) b\n"
-        "   ON b.actor = a.actor AND b.seq = a.seq AND b.ev ="
-        " a.ev\n"
-        "  WHERE a.actor IS NULL OR b.actor IS NULL)",
-        "bk AS (SELECT CASE WHEN v.view_diff = 0 AND\n"
-        "   o2.outcome <> o3.outcome AND u.n_undecided = 6\n"
-        "   THEN 1 ELSE 0 END AS blocking_certified\n"
-        "  FROM vw v\n"
-        "  CROSS JOIN (SELECT outcome FROM oc WHERE hist ="
-        " 2) o2\n"
-        "  CROSS JOIN (SELECT outcome FROM oc WHERE hist ="
-        " 3) o3\n"
-        "  CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS"
-        " n_undecided\n"
-        "    FROM st WHERE hist >= 2 AND decided = 0) u)",
-    ]
-    fin = (
-        "SELECT s.hist, s.actor, s.decided, o.outcome,\n"
-        "  a.atomicity_viol, v.validity_viol, w.view_diff,\n"
-        "  b.blocking_certified\n"
-        "FROM st s JOIN oc o ON o.hist = s.hist\n"
-        "CROSS JOIN at2 a CROSS JOIN vl v CROSS JOIN vw w\n"
-        "CROSS JOIN bk b")
-    return parts, fin
-
-
-def _q763_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q763_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q763_two_phase_commit",
-       "WITH " + _q763_join("documents", "//", " MATERIALIZED"))
-def q763(spark, sf_dir):
-    """Two-phase commit's guarantees AND its famous flaw,
-    both as data (Gray 1978; the protocol under every
-    multi-partition transactional sink).  Four histories over
-    3 participants: a clean commit (all YES -> every
-    participant decides commit, atomicity_viol == 0), a
-    vetoed run (one NO -> everyone aborts, and validity_viol
-    == 0 certifies a NO can never be overridden), and the
-    BLOCKING pair — two histories where all participants
-    voted YES and prepared, the coordinator logged COMMIT in
-    one and ABORT in the other, then crashed before sending
-    any decision.  The certificate: a FULL OUTER JOIN proves
-    every participant's local view IDENTICAL across the two
-    histories (view_diff == 0) while the global outcomes
-    differ and all six participant-states are undecided —
-    therefore NO function of local state can decide, and 2PC
-    must block on coordinator failure (blocking_certified ==
-    1).  This is the indistinguishability argument from the
-    impossibility literature run as a join.  Scale: log
-    analysis is grouped aggregation over (history, actor);
-    the pattern extends to auditing real commit logs."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q763_documents")
-    parts, fin = _q763_sql("q763_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q764: Dremel repetition/definition levels — Parquet's nested
-# encoding shredded and window-decoded, roundtrip certified
-
-
-def _q764_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"dd AS (SELECT CAST(doc_id AS BIGINT) AS dcc"
-        f" FROM {tbl} WHERE doc_id < 24)",
-        f"ii AS (SELECT CAST(doc_id AS BIGINT) AS i"
-        f" FROM {tbl} WHERE doc_id < 3)",
-        f"jj AS (SELECT CAST(doc_id AS BIGINT) AS j"
-        f" FROM {tbl} WHERE doc_id < 3)",
-        # nested truth: doc d holds a list of d%4 inner lists,
-        # inner i holds (d*7+i*3)%4 values — six empty docs and
-        # six empty inner lists by construction
-        "ft AS (SELECT d.dcc, i.i, j.j,\n"
-        "   d.dcc * 100 + i.i * 10 + j.j AS v\n"
-        "  FROM dd d JOIN ii i ON i.i < d.dcc % 4\n"
-        "  JOIN jj j ON j.j < (d.dcc * 7 + i.i * 3) % 4)",
-        "ei AS (SELECT d.dcc, i.i FROM dd d JOIN ii i\n"
-        "  ON i.i < d.dcc % 4 AND (d.dcc * 7 + i.i * 3) % 4 ="
-        " 0)",
-        "eo AS (SELECT dcc FROM dd WHERE dcc % 4 = 0)",
-        # machine A — SHRED: one stream row per value / empty
-        # list / empty record, Dremel rep and def levels
-        "sm AS{mat} (SELECT row_number() OVER (ORDER BY ord)"
-        " AS pos,\n"
-        "   rep, def, v FROM (\n"
-        "  SELECT dcc * 100 + (i + 1) * 10 + (j + 1) AS ord,\n"
-        "   CASE WHEN j > 0 THEN 2 WHEN i > 0 THEN 1 ELSE 0"
-        " END AS rep,\n"
-        "   CAST(2 AS BIGINT) AS def, v FROM ft\n"
-        "  UNION ALL\n"
-        "  SELECT dcc * 100 + (i + 1) * 10,\n"
-        "   CASE WHEN i > 0 THEN 1 ELSE 0 END,\n"
-        "   CAST(1 AS BIGINT), CAST(-1 AS BIGINT) FROM ei\n"
-        "  UNION ALL\n"
-        "  SELECT dcc * 100, CAST(0 AS BIGINT),\n"
-        "   CAST(0 AS BIGINT), CAST(-1 AS BIGINT) FROM eo)"
-        " z)",
-        # machine B — DECODE from (pos, rep, def) alone:
-        # records delimited by rep = 0, outer index advances on
-        # rep <= 1, inner index counts def = 2 rows in-group
-        "dc1 AS (SELECT pos, rep, def, v,\n"
-        "   sum(CASE WHEN rep = 0 THEN 1 ELSE 0 END) OVER\n"
-        "     (ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING"
-        " AND CURRENT ROW)\n"
-        "     - 1 AS ddc FROM sm)",
-        "dc2 AS (SELECT pos, rep, def, v, ddc,\n"
-        "   sum(CASE WHEN rep <= 1 THEN 1 ELSE 0 END) OVER\n"
-        "     (PARTITION BY ddc ORDER BY pos ROWS BETWEEN"
-        " UNBOUNDED\n"
-        "      PRECEDING AND CURRENT ROW) - 1 AS di FROM"
-        " dc1)",
-        "dc3 AS (SELECT pos, rep, def, v, ddc, di,\n"
-        "   sum(CASE WHEN def = 2 THEN 1 ELSE 0 END) OVER\n"
-        "     (PARTITION BY ddc, di ORDER BY pos ROWS BETWEEN"
-        " UNBOUNDED\n"
-        "      PRECEDING AND CURRENT ROW) - 1 AS dj FROM"
-        " dc2)",
-        # roundtrip certificates
-        "cv AS (SELECT CAST(count(*) AS BIGINT) AS cell_viol\n"
-        "  FROM (SELECT ddc, di, dj, v FROM dc3 WHERE def ="
-        " 2) a\n"
-        "  FULL OUTER JOIN ft b ON b.dcc = a.ddc AND b.i ="
-        " a.di\n"
-        "    AND b.j = a.dj AND b.v = a.v\n"
-        "  WHERE a.ddc IS NULL OR b.dcc IS NULL)",
-        "iv AS (SELECT CAST(count(*) AS BIGINT) AS inner_viol\n"
-        "  FROM (SELECT ddc, di FROM dc3 WHERE def = 1) a\n"
-        "  FULL OUTER JOIN ei b ON b.dcc = a.ddc AND b.i ="
-        " a.di\n"
-        "  WHERE a.ddc IS NULL OR b.dcc IS NULL)",
-        "ov AS (SELECT CAST(count(*) AS BIGINT) AS outer_viol\n"
-        "  FROM (SELECT ddc FROM dc3 WHERE def = 0) a\n"
-        "  FULL OUTER JOIN eo b ON b.dcc = a.ddc\n"
-        "  WHERE a.ddc IS NULL OR b.dcc IS NULL)",
-        "lv AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM sm) -\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM ft) -\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM ei) -\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM eo) AS"
-        " len_viol)",
-    ]
-    fin = (
-        "SELECT s.pos, s.rep, s.def, s.v,\n"
-        "  c.cell_viol, i.inner_viol, o.outer_viol,"
-        " l.len_viol\n"
-        "FROM sm s CROSS JOIN cv c CROSS JOIN iv i\n"
-        "CROSS JOIN ov o CROSS JOIN lv l\n"
-        "WHERE s.pos <= 14")
-    return parts, fin
-
-
-def _q764_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q764_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q764_dremel_levels",
-       "WITH " + _q764_join("documents", "//", " MATERIALIZED"))
-def q764(spark, sf_dir):
-    """Dremel repetition/definition levels (Melnik et al.
-    2010 — the nested-data encoding inside every Parquet file
-    this engine reads; columnar storage of lists-of-lists
-    with NO record reassembly needed to scan a column).  A
-    24-record nested fixture (lists of lists with six empty
-    records and six empty inner lists) is SHREDDED into the
-    flat (rep, def, value) stream by machine A — rep = how
-    many enclosing levels continue (0 starts a record, 2
-    continues an inner list), def = how deep the path is
-    defined (0/1 encode the empties) — and machine B DECODES
-    the stream back using ONLY the levels: record boundaries
-    from rep = 0 cumsum, outer index from rep <= 1 in-record
-    cumsum, inner index from def = 2 in-group cumsum — three
-    window passes, the relational form of Dremel's
-    finite-state reassembly.  FULL OUTER JOINs certify the
-    decoded cells, empty-inner markers and empty-record
-    markers each exactly reproduce the nested truth
-    (cell/inner/outer_viol == 0) and the stream length
-    accounts every value and marker (len_viol == 0).  Scale:
-    shred and decode are window passes over the stream
-    order — the same shape at a billion records, partitioned
-    by record ranges exactly as Parquet row groups do."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q764_documents")
-    parts, fin = _q764_sql("q764_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q765: ARIES redo — the pageLSN guard certified necessary and
-# sufficient on increment records with partial flushes
-
-
-def _q765_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 6 pages, 24 increment log records; checkpoint at
-        # LSN 8; crash ends the log at LSN 20; each page
-        # flushed to disk at its own LSN — pages 4 and 5
-        # flushed AHEAD of the checkpoint (the case the guard
-        # exists for)
-        f"lg AS (SELECT CAST(doc_id + 1 AS BIGINT) AS lsn,\n"
-        f"   CAST(doc_id % 6 AS BIGINT) AS pg,\n"
-        f"   CAST((doc_id * 13) % 7 + 1 AS BIGINT) AS delta\n"
-        f"  FROM {tbl} WHERE doc_id < 20)",
-        "pgs AS (SELECT CAST(doc_id AS BIGINT) AS pg,\n"
-        "   CAST(doc_id * 1000 AS BIGINT) AS base,\n"
-        "   CAST(CASE doc_id WHEN 4 THEN 14 WHEN 5 THEN 17"
-        " ELSE\n"
-        "     CASE WHEN doc_id < 2 THEN 3 ELSE 7 END END AS"
-        " BIGINT)\n"
-        "     AS flushed_lsn\n"
-        f"  FROM {tbl} WHERE doc_id < 6)",
-        # machine A: ground truth — base plus every logged
-        # increment (WAL says the log IS the history)
-        "ma AS (SELECT p.pg, p.base +\n"
-        "   CAST(coalesce(sum(l.delta), 0) AS BIGINT) AS"
-        " final_direct\n"
-        "  FROM pgs p LEFT JOIN lg l ON l.pg = p.pg\n"
-        "  GROUP BY p.pg, p.base)",
-        # disk state at crash: increments flushed through each
-        # page's own flushed_lsn
-        "dk AS (SELECT p.pg, p.base, p.flushed_lsn, p.base +\n"
-        "   CAST(coalesce(sum(CASE WHEN l.lsn <="
-        " p.flushed_lsn\n"
-        "     THEN l.delta END), 0) AS BIGINT) AS disk_val\n"
-        "  FROM pgs p LEFT JOIN lg l ON l.pg = p.pg\n"
-        "  GROUP BY p.pg, p.base, p.flushed_lsn)",
-        # machine B: ARIES redo — apply a record iff its LSN
-        # exceeds the on-disk pageLSN
-        "mb AS (SELECT d.pg, d.disk_val +\n"
-        "   CAST(coalesce(sum(CASE WHEN l.lsn > d.flushed_lsn\n"
-        "     THEN l.delta END), 0) AS BIGINT) AS final_redo,\n"
-        "   CAST(coalesce(sum(CASE WHEN l.lsn > d.flushed_lsn\n"
-        "     THEN 1 END), 0) AS BIGINT) AS n_redone\n"
-        "  FROM dk d LEFT JOIN lg l ON l.pg = d.pg\n"
-        "  GROUP BY d.pg, d.disk_val)",
-        # machine C: the NAIVE redo (replay everything after
-        # the checkpoint, no guard) — double-applies whatever
-        # was flushed past the checkpoint
-        "mc AS (SELECT d.pg, d.disk_val +\n"
-        "   CAST(coalesce(sum(CASE WHEN l.lsn > 8\n"
-        "     THEN l.delta END), 0) AS BIGINT) AS final_naive\n"
-        "  FROM dk d LEFT JOIN lg l ON l.pg = d.pg\n"
-        "  GROUP BY d.pg, d.disk_val)",
-        "ct AS (SELECT\n"
-        "   (SELECT CAST(sum(CASE WHEN a.final_direct <>"
-        " b.final_redo\n"
-        "     THEN 1 ELSE 0 END) AS BIGINT) FROM ma a JOIN mb"
-        " b ON b.pg = a.pg)\n"
-        "     AS redo_viol,\n"
-        "   (SELECT CAST(sum(CASE WHEN a.final_direct <>"
-        " c.final_naive\n"
-        "     THEN 1 ELSE 0 END) AS BIGINT) FROM ma a JOIN mc"
-        " c ON c.pg = a.pg)\n"
-        "     AS naive_wrong_pages)",
-    ]
-    fin = (
-        "SELECT a.pg, d.flushed_lsn, d.disk_val,\n"
-        "  a.final_direct, b.final_redo, c.final_naive,\n"
-        "  b.n_redone, t.redo_viol, t.naive_wrong_pages\n"
-        "FROM ma a JOIN mb b ON b.pg = a.pg\n"
-        "JOIN mc c ON c.pg = a.pg\n"
-        "JOIN dk d ON d.pg = a.pg\n"
-        "CROSS JOIN ct t")
-    return parts, fin
-
-
-def _q765_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q765_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q765_aries_redo",
-       "WITH " + _q765_join("documents", "//", " MATERIALIZED"))
-def q765(spark, sf_dir):
-    """The ARIES redo rule (Mohan et al. 1992 — 'repeating
-    history' with the pageLSN guard; the recovery discipline
-    under every WAL storage engine a checkpointing pipeline
-    trusts) certified necessary AND sufficient on increment
-    records, where getting it wrong is visible.  Six pages,
-    20 increment log records, a checkpoint at LSN 8, a crash
-    at LSN 20, and each page flushed to disk at its OWN LSN —
-    pages 4 and 5 flushed ahead of the checkpoint, the exact
-    case the guard exists for.  Machine A is ground truth
-    (base + every logged increment: the WAL principle that
-    the log is the history).  Machine B replays with the
-    guard — apply iff lsn > pageLSN — and lands exactly on
-    the truth for every page (redo_viol == 0), whatever the
-    flush pattern: redo is idempotent GIVEN the guard.
-    Machine C replays naively from the checkpoint and fails
-    in BOTH directions at once — it double-applies the
-    flushed-ahead increments on pages 4-5 AND silently loses
-    the unflushed pre-checkpoint increments on pages 0-1
-    (flushed at LSN 3 < checkpoint 8): wrong on exactly 4 of
-    6 pages (naive_wrong_pages == 4), the arithmetic of why
-    full-page idempotence does not transfer to logical
-    records and why redo must start from the oldest dirty
-    page, not the checkpoint.  Scale: recovery audit =
-    grouped sums per page over the log — partitionable by
-    page, the ARIES analysis pass as a DataFrame."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q765_documents")
-    parts, fin = _q765_sql("q765_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q766: exactly-once ingestion — idempotent producer sequencing
-# and epoch fencing, certified against the intended payload set
-
-
-def _q766_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 3 producers x intended payloads 0..9; the broker-side
-        # receive log contains duplicates (retries), reordering
-        # and ZOMBIE writes: producer 1 was re-registered at
-        # epoch 2, but its epoch-1 instance keeps sending
-        f"iv AS (SELECT CAST(doc_id {{d}} 10 AS BIGINT) AS"
-        f" prod,\n"
-        f"   CAST(doc_id % 10 AS BIGINT) AS seq,\n"
-        f"   CAST(doc_id % 10 + (doc_id {{d}} 10) * 1000 AS"
-        f" BIGINT) AS payload\n"
-        f"  FROM {tbl} WHERE doc_id < 30)",
-        # receive log: every intended send at the CURRENT
-        # epoch, plus retries (seq repeated), plus zombie
-        # epoch-1 rows for producer 1 carrying STALE payloads
-        f"rl AS{{mat}} (SELECT CAST(doc_id AS BIGINT) AS"
-        f" arrival,\n"
-        f"   CAST((doc_id * 7) % 30 {{d}} 10 AS BIGINT) AS"
-        f" prod,\n"
-        f"   CASE WHEN (doc_id * 7) % 30 {{d}} 10 = 1 THEN 2"
-        f" ELSE 1 END AS epoch,\n"
-        f"   CAST((doc_id * 7) % 30 % 10 AS BIGINT) AS seq,\n"
-        f"   CAST((doc_id * 7) % 30 % 10 + ((doc_id * 7) % 30"
-        f" {{d}} 10) * 1000\n"
-        f"     AS BIGINT) AS payload\n"
-        f"  FROM {tbl} WHERE doc_id < 30\n"
-        f"  UNION ALL\n"
-        f"  SELECT CAST(doc_id + 100 AS BIGINT),\n"
-        f"   CAST(doc_id % 3 AS BIGINT),\n"
-        f"   CASE WHEN doc_id % 3 = 1 THEN 2 ELSE 1 END,\n"
-        f"   CAST((doc_id * 3) % 10 AS BIGINT),\n"
-        f"   CAST((doc_id * 3) % 10 + (doc_id % 3) * 1000 AS"
-        f" BIGINT)\n"
-        f"  FROM {tbl} WHERE doc_id < 12\n"
-        f"  UNION ALL\n"
-        f"  SELECT CAST(doc_id + 200 AS BIGINT), CAST(1 AS"
-        f" BIGINT),\n"
-        f"   CAST(1 AS BIGINT), CAST(doc_id % 10 AS BIGINT),\n"
-        f"   CAST(90000 + doc_id AS BIGINT)\n"
-        f"  FROM {tbl} WHERE doc_id < 6)",
-        # broker epoch registry: max epoch seen per producer
-        "ep AS (SELECT prod, CAST(max(epoch) AS BIGINT) AS"
-        " cur_epoch\n"
-        "  FROM rl GROUP BY prod)",
-        # the exactly-once filter: fence stale epochs, then
-        # first arrival per (prod, seq) wins
-        "fz AS{mat} (SELECT r.* FROM rl r JOIN ep e ON e.prod"
-        " = r.prod\n"
-        "  WHERE r.epoch = e.cur_epoch)",
-        "dd2 AS (SELECT prod, seq, payload FROM (\n"
-        "  SELECT prod, seq, payload,\n"
-        "   row_number() OVER (PARTITION BY prod, seq ORDER"
-        " BY arrival)\n"
-        "     AS rn FROM fz) z WHERE rn = 1)",
-        # certificates
-        "cv AS (SELECT CAST(count(*) AS BIGINT) AS out_viol\n"
-        "  FROM dd2 a FULL OUTER JOIN iv b ON b.prod ="
-        " a.prod\n"
-        "    AND b.seq = a.seq AND b.payload = a.payload\n"
-        "  WHERE a.prod IS NULL OR b.prod IS NULL)",
-        "zc AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM rl) AS"
-        " n_received,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM rl r JOIN"
-        " ep e\n"
-        "     ON e.prod = r.prod WHERE r.epoch < e.cur_epoch)"
-        " AS n_fenced,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM fz) -\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM dd2) AS"
-        " n_deduped,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM dd2) AS"
-        " n_out)",
-    ]
-    fin = (
-        "SELECT d.prod, CAST(count(*) AS BIGINT) AS"
-        " n_payloads,\n"
-        "  CAST(sum(d.payload) AS BIGINT) AS payload_sum,\n"
-        "  max(c.out_viol) AS out_viol, max(z.n_received) AS"
-        " n_received,\n"
-        "  max(z.n_fenced) AS n_fenced, max(z.n_deduped) AS"
-        " n_deduped,\n"
-        "  max(z.n_out) AS n_out\n"
-        "FROM dd2 d CROSS JOIN cv c CROSS JOIN zc z\n"
-        "GROUP BY d.prod")
-    return parts, fin
-
-
-def _q766_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q766_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q766_exactly_once",
-       "WITH " + _q766_join("documents", "//", " MATERIALIZED"))
-def q766(spark, sf_dir):
-    """Exactly-once ingestion semantics — idempotent producer
-    sequence numbers plus epoch FENCING, the two mechanisms
-    (Kafka's idempotent producer / transactional epochs) that
-    turn at-least-once retries into exactly-once delivery for
-    a streaming sink.  The receive log holds every intended
-    send PLUS retries (duplicate (producer, seq)), arbitrary
-    reordering, and six ZOMBIE writes: producer 1's old
-    epoch-1 instance keeps sending stale payloads (90000+)
-    after its epoch-2 re-registration.  The exactly-once
-    filter is two relational steps: fence any record whose
-    epoch is below the producer's registered maximum, then
-    keep the first arrival per (producer, seq).  The
-    certificate is a FULL OUTER JOIN against the intended
-    payload set: the filtered output reproduces EXACTLY the
-    30 intended payloads (out_viol == 0) — no zombie payload
-    survives, no retry double-delivers, nothing is lost —
-    with the fenced / deduped / delivered accounting emitted
-    (48 received = 30 delivered + 12 retries dropped + 6
-    zombies fenced).  Scale: fencing is a broadcast join
-    against the tiny epoch registry; dedup is one window over
-    (producer, seq) — the streaming state-store shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q766_documents")
-    parts, fin = _q766_sql("q766_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q767: median-of-medians — the 30/70 pivot guarantee certified
-# by exact rank census on real data
-
-
-def _q767_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"vl AS (SELECT CAST(doc_id AS BIGINT) AS i,\n"
-        f"   CAST(n_chars AS BIGINT) AS x FROM {tbl}\n"
-        f"  WHERE doc_id < 500)",
-        # groups of 5 in key order; per-group median by rank
-        "gm AS{mat} (SELECT g, x AS med FROM (\n"
-        "  SELECT i {d} 5 AS g, x,\n"
-        "   row_number() OVER (PARTITION BY i {d} 5 ORDER BY"
-        " x, i) AS r\n"
-        "  FROM vl) z WHERE r = 3)",
-        # median of the 100 group medians (lower median)
-        "mm AS (SELECT med AS pivot FROM (\n"
-        "  SELECT med, row_number() OVER (ORDER BY med, g) AS"
-        " r,\n"
-        "   count(*) OVER () AS n FROM gm) z\n"
-        "  WHERE r = (n + 1) {d} 2)",
-        # exact global rank of the pivot (count <=, count <)
-        "rk AS (SELECT\n"
-        "   CAST(sum(CASE WHEN v.x < m.pivot THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS n_less,\n"
-        "   CAST(sum(CASE WHEN v.x <= m.pivot THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS n_le,\n"
-        "   CAST(count(*) AS BIGINT) AS n\n"
-        "  FROM vl v CROSS JOIN mm m)",
-        # the classical guarantee: at least 3(ceil(n/5)/2) - ?\n
-        # elements on each side — certified as the integer
-        # bounds 3n/10 - 3 <= rank and rank <= 7n/10 + 3
-        "ct AS (SELECT r.n, r.n_less, r.n_le,\n"
-        "   CASE WHEN 10 * r.n_le >= 3 * r.n - 30 THEN 1 ELSE"
-        " 0 END AS lower_ok,\n"
-        "   CASE WHEN 10 * r.n_less <= 7 * r.n + 30 THEN 1"
-        " ELSE 0 END AS upper_ok\n"
-        "  FROM rk r)",
-        # worst-case split fraction, exact integers: the
-        # larger side after partitioning at the pivot
-        "sp AS (SELECT greatest(r.n - r.n_le, r.n_less) AS"
-        " larger_side,\n"
-        "   r.n FROM rk r)",
-    ]
-    fin = (
-        "SELECT m.pivot, c.n, c.n_less, c.n_le,\n"
-        "  c.lower_ok, c.upper_ok, s.larger_side,\n"
-        "  CASE WHEN 10 * s.larger_side <= 7 * s.n + 30 THEN"
-        " 1 ELSE 0 END\n"
-        "    AS split_ok\n"
-        "FROM mm m CROSS JOIN ct c CROSS JOIN sp s")
-    return parts, fin
-
-
-def _q767_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q767_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q767_median_of_medians",
-       "WITH " + _q767_join("documents", "//", " MATERIALIZED"))
-def q767(spark, sf_dir):
-    """Median of medians (Blum-Floyd-Pratt-Rivest-Tarjan
-    1973 — the deterministic pivot that makes selection
-    worst-case linear, and the balanced-split idea under
-    range-partition boundary picking in any shuffle) with its
-    30/70 guarantee certified by exact census on the real
-    n_chars distribution.  500 values in key-order groups of
-    5; per-group medians by window rank; the pivot is the
-    lower median of the 100 group medians; its EXACT global
-    rank is then counted directly — and the classical bounds
-    hold as pure integer comparisons (10*rank >= 3n - 30 and
-    10*rank' <= 7n + 30, the +-3 slack covering the boundary
-    groups), so the larger side after partitioning is
-    certified <= 7n/10 + 3 (split_ok == 1): the inequality
-    that caps quickselect recursion depth.  Scale: grouped
-    rank + one census join — the same shape Spark's
-    repartitionByRange sampling replaces with sketches; this
-    is the deterministic-guarantee version."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q767_documents")
-    parts, fin = _q767_sql("q767_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q768: roaring bitmap container selection — size-optimal hybrid
-# containers with set algebra certified against direct set ops
-
-
-def _q768_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # two posting sets over a 0..2047 key space, 8
-        # containers of 256 keys: set A dense in low containers
-        # sparse in high, set B the reverse — so the optimal
-        # container type flips across the space
-        f"ka AS{{mat}} (SELECT DISTINCT CAST((doc_id * 17) %"
-        f" 2048 AS BIGINT) AS k\n"
-        f"  FROM {tbl} WHERE doc_id < 400 AND (doc_id * 17) %"
-        f" 2048 < 1024\n"
-        f"  UNION\n"
-        f"  SELECT DISTINCT CAST(1024 + (doc_id * 61) % 1024"
-        f" AS BIGINT)\n"
-        f"  FROM {tbl} WHERE doc_id < 24)",
-        f"kb AS{{mat}} (SELECT DISTINCT CAST(1024 + (doc_id *"
-        f" 13) % 1024 AS BIGINT) AS k\n"
-        f"  FROM {tbl} WHERE doc_id < 400\n"
-        f"  UNION\n"
-        f"  SELECT DISTINCT CAST((doc_id * 97) % 1024 AS"
-        f" BIGINT)\n"
-        f"  FROM {tbl} WHERE doc_id < 24)",
-        # per-container cardinalities and the roaring rule:
-        # array container costs 2B/key, bitmap container a
-        # flat 32B (256 bits) — pick the cheaper
-        "ca AS (SELECT k {d} 256 AS c, CAST(count(*) AS"
-        " BIGINT) AS card\n"
-        "  FROM ka GROUP BY k {d} 256)",
-        "cb AS (SELECT k {d} 256 AS c, CAST(count(*) AS"
-        " BIGINT) AS card\n"
-        "  FROM kb GROUP BY k {d} 256)",
-        "sa AS (SELECT c, card,\n"
-        "   CASE WHEN 2 * card <= 32 THEN 0 ELSE 1 END AS"
-        " typ,\n"
-        "   least(2 * card, 32) AS bytes FROM ca)",
-        "sb AS (SELECT c, card,\n"
-        "   CASE WHEN 2 * card <= 32 THEN 0 ELSE 1 END AS"
-        " typ,\n"
-        "   least(2 * card, 32) AS bytes FROM cb)",
-        # container-wise set algebra vs direct set ops
-        "iu AS (SELECT a.c,\n"
-        "   CAST(count(*) AS BIGINT) AS inter_card\n"
-        "  FROM ka a JOIN kb b ON b.k = a.k GROUP BY a.c"
-        ")".replace("a.c,", "a.k {d} 256 AS c,")
-        .replace("GROUP BY a.c", "GROUP BY a.k {d} 256"),
-        "uu AS (SELECT k {d} 256 AS c, CAST(count(*) AS"
-        " BIGINT) AS union_card\n"
-        "  FROM (SELECT k FROM ka UNION SELECT k FROM kb) z\n"
-        "  GROUP BY k {d} 256)",
-        "cv AS (SELECT CAST(sum(CASE WHEN\n"
-        "   coalesce(a.card, 0) + coalesce(b.card, 0) -\n"
-        "   coalesce(i.inter_card, 0) <> u.union_card\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " inclusion_viol\n"
-        "  FROM uu u LEFT JOIN ca a ON a.c = u.c\n"
-        "  LEFT JOIN cb b ON b.c = u.c\n"
-        "  LEFT JOIN iu i ON i.c = u.c)",
-        "tt AS (SELECT\n"
-        "   (SELECT CAST(sum(bytes) AS BIGINT) FROM sa) AS"
-        " bytes_a,\n"
-        "   (SELECT CAST(sum(bytes) AS BIGINT) FROM sb) AS"
-        " bytes_b,\n"
-        "   (SELECT CAST(sum(2 * card) AS BIGINT) FROM ca) AS"
-        " arr_only_a,\n"
-        "   (SELECT CAST(count(*) * 32 AS BIGINT) FROM ca) AS"
-        " bmp_only_a)",
-    ]
-    fin = (
-        "SELECT s.c, s.card AS card_a, s.typ AS typ_a,\n"
-        "  s.bytes AS bytes_a, t2.card AS card_b,\n"
-        "  t2.typ AS typ_b, t2.bytes AS bytes_b,\n"
-        "  coalesce(i.inter_card, 0) AS inter_card,\n"
-        "  u.union_card, v.inclusion_viol,\n"
-        "  t.bytes_a AS tot_a, t.bytes_b AS tot_b,\n"
-        "  t.arr_only_a, t.bmp_only_a\n"
-        "FROM sa s JOIN sb t2 ON t2.c = s.c\n"
-        "LEFT JOIN iu i ON i.c = s.c\n"
-        "JOIN uu u ON u.c = s.c\n"
-        "CROSS JOIN cv v CROSS JOIN tt t")
-    return parts, fin
-
-
-def _q768_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q768_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q768_roaring_containers",
-       "WITH " + _q768_join("documents", "//", " MATERIALIZED"))
-def q768(spark, sf_dir):
-    """Roaring bitmap container selection (Chambi-Lemire 2016
-    — the hybrid posting-set format inside Lucene, Druid and
-    Spark's own shuffle tracking): the key space splits into
-    256-key containers, each stored as a sorted ARRAY
-    (2 bytes/key) or a BITMAP (flat 32 bytes here), whichever
-    is smaller — the whole format is that one inequality.
-    Two posting sets with opposite density profiles make the
-    choice flip across the space: dense containers go bitmap,
-    sparse go array, and the hybrid total beats BOTH
-    pure-array and pure-bitmap layouts (tot_a vs arr_only_a
-    vs bmp_only_a).  Set algebra stays container-local:
-    per-container |A| + |B| - |A i B| == |A u B| certified
-    with zero violations (inclusion_viol == 0) — the
-    container decomposition commutes with union/intersection,
-    which is why roaring ops never materialize the global
-    set.  Scale: container stats are a groupBy on the high
-    bits; this is exactly how a distributed posting store
-    shards."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q768_documents")
-    parts, fin = _q768_sql("q768_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q769: weighted median optimality — the L1 facility location
-# certificate by exhaustive census
-
-
-def _q769_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # weighted points on a line: positions from the
-        # integer lon derivation, weights = n_chars
-        f"pt AS{{mat}} (SELECT CAST(doc_id AS BIGINT) AS i,\n"
-        f"   CAST((doc_id * 9973) % 36000 AS BIGINT) AS x,\n"
-        f"   CAST(n_chars AS BIGINT) AS w\n"
-        f"  FROM {tbl} WHERE doc_id < 200)",
-        "tw AS (SELECT CAST(sum(w) AS BIGINT) AS big_w FROM"
-        " pt)",
-        # the weighted median: smallest x with cumulative
-        # weight >= W/2 (cross-multiplied, no division)
-        "cm AS (SELECT x, w,\n"
-        "   sum(w) OVER (ORDER BY x, i ROWS BETWEEN UNBOUNDED"
-        " PRECEDING\n"
-        "     AND CURRENT ROW) AS cw FROM pt)",
-        "md AS (SELECT min(x) AS wmed FROM cm CROSS JOIN tw\n"
-        "  WHERE 2 * cw >= big_w)",
-        # exhaustive census: the L1 objective at EVERY point
-        # position
-        "ob AS{mat} (SELECT c.x AS cand,\n"
-        "   CAST(sum(p.w * abs(p.x - c.x)) AS BIGINT) AS"
-        " cost\n"
-        "  FROM (SELECT DISTINCT x FROM pt) c CROSS JOIN pt"
-        " p\n"
-        "  GROUP BY c.x)",
-        "mn AS (SELECT min(cost) AS best_cost FROM ob)",
-        "ck AS (SELECT\n"
-        "   (SELECT cost FROM ob JOIN md ON ob.cand ="
-        " md.wmed) -\n"
-        "   (SELECT best_cost FROM mn) AS optimality_viol)",
-        # the subgradient certificate: weight strictly below
-        # the median <= W/2 <= weight up to and including it
-        "sg AS (SELECT\n"
-        "   CASE WHEN 2 * (SELECT CAST(coalesce(sum(w), 0) AS"
-        " BIGINT)\n"
-        "     FROM pt CROSS JOIN md WHERE x < wmed) <=\n"
-        "     (SELECT big_w FROM tw)\n"
-        "    AND 2 * (SELECT CAST(sum(w) AS BIGINT)\n"
-        "     FROM pt CROSS JOIN md WHERE x <= wmed) >=\n"
-        "     (SELECT big_w FROM tw)\n"
-        "   THEN 0 ELSE 1 END AS subgradient_viol)",
-    ]
-    fin = (
-        "SELECT m.wmed, t.big_w, c.optimality_viol,\n"
-        "  s.subgradient_viol,\n"
-        "  (SELECT best_cost FROM mn) AS best_cost,\n"
-        "  (SELECT CAST(count(*) AS BIGINT) FROM ob o2\n"
-        "   JOIN mn ON o2.cost = mn.best_cost) AS n_optima\n"
-        "FROM md m CROSS JOIN tw t CROSS JOIN ck c\n"
-        "CROSS JOIN sg s")
-    return parts, fin
-
-
-def _q769_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q769_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q769_weighted_median",
-       "WITH " + _q769_join("documents", "//", " MATERIALIZED"))
-def q769(spark, sf_dir):
-    """The weighted median minimizes weighted L1 distance —
-    the 1-D facility-location theorem (and the reason
-    'median' is the robust aggregation under every outlier-
-    tolerant pipeline stat), certified by EXHAUSTIVE census.
-    200 weighted points (positions from the integer lon
-    derivation, weights from real n_chars); the weighted
-    median is the smallest position whose cumulative weight
-    reaches W/2 (cross-multiplied — no division, no ties
-    ambiguity), and the census evaluates the exact integer
-    objective sum w|x - c| at EVERY candidate position: the
-    median's cost equals the global minimum
-    (optimality_viol == 0), with the number of co-optimal
-    positions emitted (L1 optima form a plateau when W/2
-    falls between points).  The SUBGRADIENT certificate rides
-    along: strictly-below weight <= W/2 <= inclusive weight —
-    the sign-change condition that makes the cumulative rule
-    correct.  Scale: the median is one window pass; the
-    quadratic census is the certificate, not the path."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q769_documents")
-    parts, fin = _q769_sql("q769_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q770: sort-to-compress — run-length structure of sorted vs
-# unsorted layouts, exact run census and byte model
-
-
-def _q770_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # one low-cardinality column (lang) in three layouts:
-        # insertion order, sorted by the column, clustered by
-        # an unrelated key — runs counted exactly via lag
-        f"bs AS{{mat}} (SELECT CAST(doc_id AS BIGINT) AS i,"
-        f" lang,\n"
-        f"   CAST((doc_id * 37) % 101 AS BIGINT) AS shuf\n"
-        f"  FROM {tbl})",
-        "r0 AS (SELECT CAST(sum(CASE WHEN lang <> prev OR"
-        " prev IS NULL\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS runs FROM\n"
-        "  (SELECT lang, lag(lang) OVER (ORDER BY i) AS prev"
-        " FROM bs) z)",
-        "r1 AS (SELECT CAST(sum(CASE WHEN lang <> prev OR"
-        " prev IS NULL\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS runs FROM\n"
-        "  (SELECT lang, lag(lang) OVER (ORDER BY lang, i) AS"
-        " prev FROM bs) z)",
-        "r2 AS (SELECT CAST(sum(CASE WHEN lang <> prev OR"
-        " prev IS NULL\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS runs FROM\n"
-        "  (SELECT lang, lag(lang) OVER (ORDER BY shuf, i) AS"
-        " prev FROM bs) z)",
-        "nv AS (SELECT CAST(count(DISTINCT lang) AS BIGINT)"
-        " AS ndv,\n"
-        "   CAST(count(*) AS BIGINT) AS n FROM bs)",
-        # RLE byte model: 3 bytes per run (1B dict code + 2B
-        # length); plain dict encoding: 1 B per row
-        "ct AS (SELECT n.n, n.ndv,\n"
-        "   r0.runs AS runs_natural, r1.runs AS runs_sorted,\n"
-        "   r2.runs AS runs_shuffled,\n"
-        "   3 * r0.runs AS rle_natural, 3 * r1.runs AS"
-        " rle_sorted,\n"
-        "   3 * r2.runs AS rle_shuffled, n.n AS plain_dict,\n"
-        "   CASE WHEN r1.runs = n.ndv THEN 1 ELSE 0 END AS"
-        " sorted_is_optimal,\n"
-        "   CASE WHEN r1.runs <= r0.runs AND r0.runs <="
-        " n.n\n"
-        "    THEN 1 ELSE 0 END AS ordering_ok\n"
-        "  FROM nv n CROSS JOIN r0 CROSS JOIN r1 CROSS JOIN"
-        " r2)",
-    ]
-    fin = "SELECT * FROM ct"
-    return parts, fin
-
-
-def _q770_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q770_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q770_sort_to_compress",
-       "WITH " + _q770_join("documents", "//", " MATERIALIZED"))
-def q770(spark, sf_dir):
-    """Sort-to-compress — the file-layout rule that a
-    low-cardinality column sorted (or clustered) first
-    collapses to its theoretical minimum run count, priced
-    exactly on the real lang column.  Three layouts of the
-    same data: natural insertion order, sorted by the column,
-    and clustered by an unrelated shuffle key; RLE runs are
-    counted exactly by a lag pass.  Certificates: sorted runs
-    == NDV exactly (sorted_is_optimal == 1 — the information-
-    theoretic floor: one run per distinct value), and the
-    ordering runs_sorted <= runs_natural <= n holds
-    (ordering_ok == 1).  The byte model (3 B/run vs 1 B/row
-    dictionary-plain) quantifies the win — the reason this
-    engine's Hilbert/Morton clustering (q30/q89) and every
-    'sort before write' Parquet recommendation exist: row-
-    group compression AND zonemap selectivity both follow run
-    structure.  Scale: run counting is one window pass per
-    candidate layout — cheap enough to run as a layout
-    advisor over real tables."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q770_documents")
-    parts, fin = _q770_sql("q770_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q771: event-time watermarks — allowed-lateness accounting with
-# exact conservation across policies
-
-
-def _q771_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # event time from ts; arrival skew planted from keys:
-        # most events arrive with small skew, every 17th is
-        # badly delayed (the stragglers watermarks exist for)
-        "ev AS{mat} (SELECT CAST(event_id AS BIGINT) AS eid,\n"
-        "   {es} AS et,\n"
-        "   {es} + CASE WHEN event_id % 17 = 0 THEN 7200\n"
-        "     ELSE (event_id * 13) % 120 END AS at2\n"
-        "  FROM events)",
-        # watermark at each arrival: max event time seen so
-        # far (arrival order) minus the fixed delay 300 s
-        "wm AS{mat} (SELECT eid, et, at2,\n"
-        "   max(et) OVER (ORDER BY at2, eid ROWS BETWEEN"
-        " UNBOUNDED\n"
-        "     PRECEDING AND CURRENT ROW) - 300 AS wmk\n"
-        "  FROM ev)",
-        # an event is on time if its hour-window end is ahead
-        # of the watermark at its arrival; late-but-accepted
-        # if the watermark passed the end by at most the
-        # allowed lateness L; dropped otherwise
-        "pl AS (SELECT CAST(x AS BIGINT) AS lat FROM (VALUES"
-        " (0), (600), (3600)) t(x))",
-        "cl AS (SELECT p.lat, w.eid,\n"
-        "   (w.et {d} 3600) * 3600 + 3600 AS wend, w.wmk\n"
-        "  FROM wm w CROSS JOIN pl p)",
-        "ac AS (SELECT lat,\n"
-        "   CAST(sum(CASE WHEN wmk < wend THEN 1 ELSE 0 END)"
-        " AS BIGINT)\n"
-        "     AS on_time,\n"
-        "   CAST(sum(CASE WHEN wmk >= wend AND wmk < wend +"
-        " lat\n"
-        "     THEN 1 ELSE 0 END) AS BIGINT) AS late_accepted,\n"
-        "   CAST(sum(CASE WHEN wmk >= wend + lat THEN 1 ELSE"
-        " 0 END)\n"
-        "     AS BIGINT) AS dropped,\n"
-        "   CAST(count(*) AS BIGINT) AS total\n"
-        "  FROM cl GROUP BY lat)",
-        "cv AS (SELECT CAST(sum(CASE WHEN on_time +"
-        " late_accepted +\n"
-        "   dropped <> total THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " cons_viol\n"
-        "  FROM ac)",
-        "mv AS (SELECT CASE WHEN\n"
-        "   (SELECT dropped FROM ac WHERE lat = 0) >=\n"
-        "   (SELECT dropped FROM ac WHERE lat = 600) AND\n"
-        "   (SELECT dropped FROM ac WHERE lat = 600) >=\n"
-        "   (SELECT dropped FROM ac WHERE lat = 3600)\n"
-        "   THEN 0 ELSE 1 END AS monotone_viol)",
-        "wv AS (SELECT CAST(sum(CASE WHEN b.wmk < a.wmk THEN"
-        " 1 ELSE 0 END)\n"
-        "   AS BIGINT) AS wm_monotone_viol\n"
-        "  FROM (SELECT wmk, row_number() OVER (ORDER BY at2,"
-        " eid) AS r\n"
-        "    FROM wm) a\n"
-        "  JOIN (SELECT wmk, row_number() OVER (ORDER BY at2,"
-        " eid) AS r\n"
-        "    FROM wm) b ON b.r = a.r + 1)",
-    ]
-    fin = (
-        "SELECT a.lat AS allowed_lateness, a.on_time,\n"
-        "  a.late_accepted, a.dropped, a.total,\n"
-        "  c.cons_viol, m.monotone_viol, w.wm_monotone_viol\n"
-        "FROM ac a CROSS JOIN cv c CROSS JOIN mv m\n"
-        "CROSS JOIN wv w")
-    return parts, fin
-
-
-def _q771_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q771_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           .replace("{es}", "CAST(floor(epoch(ts)) AS BIGINT)")
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q771_allowed_lateness",
-       "WITH " + _q771_join("documents", "//", " MATERIALIZED"))
-def q771(spark, sf_dir):
-    """Event-time watermark semantics with exact allowed-
-    lateness accounting — the out-of-order bookkeeping under
-    every Structured Streaming window this engine ships
-    (q36/q61/q86).  Arrival times are event times plus a
-    planted skew (most events near-on-time, every 17th
-    delayed two hours — the stragglers watermarks exist for);
-    the watermark is the running max of SEEN event times
-    minus a 300 s delay, certified monotone non-decreasing in
-    arrival order (wm_monotone_viol == 0 — the property that
-    makes window-close decisions final).  Each event's hour
-    window is then judged at THREE allowed-lateness policies
-    (0 / 10 min / 1 h): on-time if the watermark has not
-    passed the window end at arrival, late-accepted inside
-    the lateness budget, dropped beyond it.  Conservation
-    on_time + late_accepted + dropped == total holds at every
-    policy (cons_viol == 0) and dropping is monotone
-    decreasing in the budget (monotone_viol == 0) — the
-    completeness-vs-latency dial as exact integers.  Engine
-    note: epoch seconds isolate the unix_timestamp()/epoch()
-    two-dialect seam per the q317 rule.  Scale: one running-
-    max window + one grouped census — the accounting a
-    production pipeline should emit beside every windowed
-    aggregate."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
-        "events")
-    parts, fin = _q771_sql("events", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            .replace("{es}", "CAST(unix_timestamp(ts) AS"
-                     " BIGINT)")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q772: AMS F2 sketch — unbiasedness and the variance lemma
-# proven by complete-family exhaustion, no probability left
-
-
-def _q772_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # real frequency vector over a 13-value universe
-        f"fq AS{{mat}} (SELECT CAST(n_chars % 13 AS BIGINT) AS"
-        f" v,\n"
-        f"   CAST(count(*) AS BIGINT) AS f\n"
-        f"  FROM {tbl} WHERE doc_id < 60 GROUP BY n_chars %"
-        f" 13)",
-        "mo AS (SELECT CAST(sum(f * f) AS BIGINT) AS f2,\n"
-        "   CAST(sum(f * f * f * f) AS BIGINT) AS f4,\n"
-        "   CAST(count(*) AS BIGINT) AS u FROM fq)",
-        # the COMPLETE +-1 sign family: all 2^13 assignments,
-        # pattern p's sign for value v read from bit v of p
-        f"pa AS (SELECT CAST(doc_id AS BIGINT) AS a"
-        f" FROM {tbl} WHERE doc_id < 64)",
-        f"pb AS (SELECT CAST(doc_id AS BIGINT) AS b"
-        f" FROM {tbl} WHERE doc_id < 128)",
-        "pt AS (SELECT a.a * 128 + b.b AS p FROM pa a CROSS"
-        " JOIN pb b)",
-        "es AS{mat} (SELECT t.p,\n"
-        "   CAST(sum(q.f * (2 * ((t.p {d} (CASE CAST(q.v AS"
-        " INT)\n"
-        "     WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN"
-        " 3 THEN 8\n"
-        "     WHEN 4 THEN 16 WHEN 5 THEN 32 WHEN 6 THEN 64"
-        " WHEN 7 THEN 128\n"
-        "     WHEN 8 THEN 256 WHEN 9 THEN 512 WHEN 10 THEN"
-        " 1024\n"
-        "     WHEN 11 THEN 2048 ELSE 4096 END)) % 2) - 1)) AS"
-        " BIGINT) AS z\n"
-        "  FROM pt t CROSS JOIN fq q GROUP BY t.p)",
-        "ag AS (SELECT CAST(sum(z * z) AS BIGINT) AS"
-        " sum_est,\n"
-        "   CAST(count(*) AS BIGINT) AS fam FROM es)",
-        "vr AS (SELECT CAST(sum((e.z * e.z - m.f2) * (e.z *"
-        " e.z - m.f2))\n"
-        "   AS BIGINT) AS sum_sq_dev\n"
-        "  FROM es e CROSS JOIN mo m)",
-    ]
-    fin = (
-        "SELECT m.u AS universe, m.f2, m.f4, a.fam,\n"
-        "  a.sum_est - a.fam * m.f2 AS unbiased_viol,\n"
-        "  v.sum_sq_dev - a.fam * 2 * (m.f2 * m.f2 - m.f4)\n"
-        "    AS variance_viol\n"
-        "FROM mo m CROSS JOIN ag a CROSS JOIN vr v")
-    return parts, fin
-
-
-def _q772_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q772_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q772_ams_sketch",
-       "WITH " + _q772_join("documents", "//", " MATERIALIZED"))
-def q772(spark, sf_dir):
-    """The Alon-Matias-Szegedy F2 sketch (AMS 1996, the
-    Godel-prize result that started streaming sketches — the
-    self-join-size estimator behind every join-cardinality
-    advisor, q467 included) with its two famous lemmas proven
-    by COMPLETE-FAMILY EXHAUSTION: no probability statement
-    survives, only integer identities.  Over the real
-    frequency vector (n_chars mod 13, 13 values), every one
-    of the 2^13 sign assignments s: U -> {+-1} is evaluated —
-    pattern p's sign for value v is bit v of p, the
-    derandomization made literal — giving every estimate
-    z_p^2 = (sum_v f_v s_p(v))^2.  UNBIASEDNESS: sum_p z_p^2
-    == 2^13 * F2 exactly (unbiased_viol == 0) — the cross
-    terms cancel over the family, which is all 'E[est] = F2'
-    ever meant.  The VARIANCE LEMMA: sum_p (z_p^2 - F2)^2 ==
-    2^13 * 2(F2^2 - F4) exactly (variance_viol == 0) — the
-    bound that sizes the median-of-means replication.  Scale:
-    the census is 2^13 x 13 rows; a real sketch keeps k
-    columns of it — this query is the WHY behind the k."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q772_documents")
-    parts, fin = _q772_sql("q772_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q773: write skew — snapshot isolation's signature anomaly and
-# the SSI dangerous structure that catches it
-
-
-_Q773_OPS = ",\n   ".join([
-    # (sched, txn, seq, op, row, val): op 1 read, 2 write,
-    # 3 commit.  Rows: 0 = A, 1 = B; initial A = 1, B = 1.
-    # sched 0 SERIAL: T1 fully before T2
-    "(0, 1, 1, 1, 0, 1)", "(0, 1, 2, 1, 1, 1)",
-    "(0, 1, 3, 2, 0, 0)", "(0, 1, 4, 3, -1, 0)",
-    "(0, 2, 5, 1, 0, 0)", "(0, 2, 6, 1, 1, 1)",
-    "(0, 2, 7, 3, -1, 0)",
-    # sched 1 SNAPSHOT-ISOLATION interleaving: both read the
-    # initial snapshot, both write disjoint rows, both commit
-    "(1, 1, 1, 1, 0, 1)", "(1, 1, 2, 1, 1, 1)",
-    "(1, 2, 3, 1, 0, 1)", "(1, 2, 4, 1, 1, 1)",
-    "(1, 1, 5, 2, 0, 0)", "(1, 2, 6, 2, 1, 0)",
-    "(1, 1, 7, 3, -1, 0)", "(1, 2, 8, 3, -1, 0)"])
-
-
-def _q773_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "op AS (SELECT * FROM (VALUES\n   " + _Q773_OPS
-        + ") t(sched, txn, seq, op, rw, val))",
-        # final state per row: initial 1 overwritten by the
-        # last committed write
-        "fs AS (SELECT s.sched, r.rw,\n"
-        "   CAST(coalesce(max_by(o.val, o.seq), 1) AS BIGINT)"
-        " AS val\n"
-        "  FROM (SELECT DISTINCT sched FROM op) s\n"
-        "  CROSS JOIN (SELECT CAST(x AS BIGINT) AS rw FROM"
-        " (VALUES (0), (1)) t(x)) r\n"
-        "  LEFT JOIN op o ON o.sched = s.sched AND o.rw ="
-        " r.rw AND o.op = 2\n"
-        "  GROUP BY s.sched, r.rw)",
-        "iv AS (SELECT sched, CAST(sum(val) AS BIGINT) AS"
-        " on_call,\n"
-        "   CASE WHEN sum(val) >= 1 THEN 1 ELSE 0 END AS"
-        " invariant_ok\n"
-        "  FROM fs GROUP BY sched)",
-        # the guard each txn obeyed: it wrote only because the
-        # values it READ summed >= 2 — recomputed from its own
-        # reads, certifying each txn locally behaved correctly
-        "gd AS (SELECT w.sched, w.txn,\n"
-        "   CASE WHEN rsum.s >= 2 THEN 1 ELSE 0 END AS"
-        " guard_ok\n"
-        "  FROM (SELECT DISTINCT sched, txn FROM op WHERE op"
-        " = 2) w\n"
-        "  JOIN (SELECT sched, txn, CAST(sum(val) AS BIGINT)"
-        " AS s\n"
-        "    FROM op WHERE op = 1 GROUP BY sched, txn) rsum\n"
-        "   ON rsum.sched = w.sched AND rsum.txn = w.txn)",
-        "gv AS (SELECT CAST(sum(1 - guard_ok) AS BIGINT) AS"
-        " guard_viol FROM gd)",
-        # SSI dangerous structure: rw-antidependency T_i reads
-        # a row T_j later writes, in BOTH directions between
-        # two concurrent transactions
-        "rw2 AS (SELECT DISTINCT a.sched, a.txn AS ti, b.txn"
-        " AS tj\n"
-        "  FROM op a JOIN op b ON b.sched = a.sched AND b.txn"
-        " <> a.txn\n"
-        "   AND b.rw = a.rw AND a.op = 1 AND b.op = 2 AND"
-        " b.seq > a.seq)",
-        "cy AS (SELECT s.sched,\n"
-        "   CAST(CASE WHEN count(*) >= 2 THEN 1 ELSE 0 END AS"
-        " BIGINT)\n"
-        "     AS rw_cycle\n"
-        "  FROM (SELECT DISTINCT sched FROM op) s\n"
-        "  LEFT JOIN (SELECT x.sched FROM rw2 x JOIN rw2 y\n"
-        "    ON y.sched = x.sched AND y.ti = x.tj AND y.tj ="
-        " x.ti) z\n"
-        "   ON z.sched = s.sched\n"
-        "  GROUP BY s.sched)".replace(
-            "count(*) >= 2", "count(z.sched) >= 2"),
-    ]
-    fin = (
-        "SELECT i.sched, f0.val AS final_a, f1.val AS"
-        " final_b,\n"
-        "  i.on_call, i.invariant_ok, c.rw_cycle,\n"
-        "  g.guard_viol,\n"
-        "  CASE WHEN i.invariant_ok = 0 AND c.rw_cycle = 1\n"
-        "   THEN 1 WHEN i.invariant_ok = 1 AND c.rw_cycle ="
-        " 0\n"
-        "   THEN 1 ELSE 0 END AS detector_correct\n"
-        "FROM iv i\n"
-        "JOIN fs f0 ON f0.sched = i.sched AND f0.rw = 0\n"
-        "JOIN fs f1 ON f1.sched = i.sched AND f1.rw = 1\n"
-        "JOIN cy c ON c.sched = i.sched\n"
-        "CROSS JOIN gv g")
-    return parts, fin
-
-
-def _q773_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q773_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q773_write_skew",
-       "WITH " + _q773_join("documents", "//", " MATERIALIZED"))
-def q773(spark, sf_dir):
-    """Write skew — snapshot isolation's signature anomaly
-    (Berenson et al. 1995) and the SSI dangerous structure
-    that catches it (Cahill-Rohm-Fekete 2008), both as data.
-    The on-call-doctors classic: invariant A + B >= 1; each
-    transaction goes off call only if the values it READ sum
-    to >= 2 — and guard_viol == 0 certifies every transaction
-    locally obeyed that rule in both schedules.  The SERIAL
-    schedule ends at A + B = 1: T2, reading T1's write,
-    declines.  The SI schedule gives both transactions the
-    initial snapshot; they write DISJOINT rows, first-
-    committer-wins sees no write-write conflict, both commit
-    — and the invariant every participant checked is violated
-    (on_call == 0): correctness leaked between the reads and
-    writes of CONCURRENT transactions.  The SSI detector —
-    rw-antidependency edges in both directions between two
-    concurrent transactions — fires exactly on the SI
-    schedule and stays quiet on the serial one
-    (detector_correct == 1 on both rows).  Scale: rw-edge
-    construction is a self-join of the operation log on row —
-    the shape of a commit-time certifier over a real
-    transaction journal."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q773_documents")
-    parts, fin = _q773_sql("q773_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q774: GSP vs VCG position auctions — truthfulness decided by
-# exhaustive deviation census
-
-
-def _q774_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "bd AS (SELECT * FROM (VALUES (0, 16), (1, 12),"
-        " (2, 8), (3, 4)) t(i, v))",
-        "ct AS (SELECT * FROM (VALUES (0, 10), (1, 6),"
-        " (2, 3), (3, 0)) t(slot, ctr))",
-        # scenarios: the truthful profile (dev = -1) plus every
-        # unilateral deviation over the bid grid 0..20
-        f"sc AS (SELECT CAST(-1 AS BIGINT) AS di, CAST(0 AS"
-        f" BIGINT) AS db\n"
-        f"  FROM {tbl} WHERE doc_id = 0\n"
-        f"  UNION ALL\n"
-        f"  SELECT CAST(doc_id % 4 AS BIGINT), CAST(doc_id"
-        f" {{d}} 4 AS BIGINT)\n"
-        f"  FROM {tbl} WHERE doc_id < 84)",
-        "bb AS{mat} (SELECT s.di, s.db, b.i, b.v,\n"
-        "   CASE WHEN b.i = s.di THEN s.db ELSE b.v END AS"
-        " bid\n"
-        "  FROM sc s CROSS JOIN bd b)",
-        # deterministic ranking: higher bid first, ties to the
-        # lower bidder id
-        "rk AS{mat} (SELECT a.di, a.db, a.i, a.v, a.bid,\n"
-        "   CAST((SELECT count(*) FROM bb o WHERE o.di = a.di"
-        " AND o.db = a.db\n"
-        "     AND (o.bid > a.bid OR (o.bid = a.bid AND o.i <"
-        " a.i))) AS BIGINT)\n"
-        "     AS slot\n"
-        "  FROM bb a)",
-        # GSP: pay the next bid; VCG: pay the externality
-        "ut AS{mat} (SELECT r.di, r.db, r.i, r.v, r.slot,"
-        " c.ctr,\n"
-        "   c.ctr * (r.v - coalesce(n.bid, 0)) AS gsp_u,\n"
-        "   c.ctr * r.v - coalesce(x.pay, 0) AS vcg_u,\n"
-        "   c.ctr * coalesce(n.bid, 0) AS gsp_pay,\n"
-        "   coalesce(x.pay, 0) AS vcg_pay\n"
-        "  FROM rk r JOIN ct c ON c.slot = r.slot\n"
-        "  LEFT JOIN rk n ON n.di = r.di AND n.db = r.db AND"
-        " n.slot = r.slot + 1\n"
-        "  LEFT JOIN (SELECT a.di, a.db, a.slot,\n"
-        "     CAST(sum(m.bid * (cp.ctr - cm.ctr)) AS BIGINT)"
-        " AS pay\n"
-        "    FROM rk a JOIN rk m ON m.di = a.di AND m.db ="
-        " a.db\n"
-        "      AND m.slot > a.slot\n"
-        "    JOIN ct cp ON cp.slot = m.slot - 1\n"
-        "    JOIN ct cm ON cm.slot = m.slot\n"
-        "    GROUP BY a.di, a.db, a.slot) x\n"
-        "   ON x.di = r.di AND x.db = r.db AND x.slot ="
-        " r.slot)",
-        "bs AS (SELECT i, gsp_u AS gsp_base, vcg_u AS"
-        " vcg_base\n"
-        "  FROM ut WHERE di = -1)",
-        # gains of the deviating bidder only
-        "gn AS (SELECT u.di, u.db,\n"
-        "   u.gsp_u - b.gsp_base AS gsp_gain,\n"
-        "   u.vcg_u - b.vcg_base AS vcg_gain\n"
-        "  FROM ut u JOIN bs b ON b.i = u.di\n"
-        "  WHERE u.di >= 0 AND u.i = u.di)",
-        "ct2 AS (SELECT\n"
-        "   CAST(sum(CASE WHEN gsp_gain > 0 THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS n_gsp_profitable,\n"
-        "   CAST(max(vcg_gain) AS BIGINT) AS max_vcg_gain,\n"
-        "   CAST(max(gsp_gain * 10000 + (99 - di) * 100 +"
-        " db) AS BIGINT)\n"
-        "     AS best_pack FROM gn)",
-        "rv AS (SELECT\n"
-        "   (SELECT CAST(sum(gsp_pay) AS BIGINT) FROM ut"
-        " WHERE di = -1)\n"
-        "     AS gsp_revenue,\n"
-        "   (SELECT CAST(sum(vcg_pay) AS BIGINT) FROM ut"
-        " WHERE di = -1)\n"
-        "     AS vcg_revenue)",
-    ]
-    fin = (
-        "SELECT b.i AS bidder, b.gsp_base, b.vcg_base,\n"
-        "  c.n_gsp_profitable, c.max_vcg_gain,\n"
-        "  c.best_pack {d} 10000 AS best_gsp_gain,\n"
-        "  99 - (c.best_pack % 10000) {d} 100 AS"
-        " best_deviator,\n"
-        "  c.best_pack % 100 AS best_shaded_bid,\n"
-        "  r.gsp_revenue, r.vcg_revenue\n"
-        "FROM bs b CROSS JOIN ct2 c CROSS JOIN rv r")
-    return parts, fin
-
-
-def _q774_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q774_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return (",\n       ".join(out) + "\n"
-            + fin.replace("{d}", d))
-
-
-@query("q774_gsp_vcg_auctions",
-       "WITH " + _q774_join("documents", "//", " MATERIALIZED"))
-def q774(spark, sf_dir):
-    """Position auctions: GSP is NOT truthful, VCG is — both
-    decided by exhaustive unilateral-deviation census
-    (Edelman-Ostrovsky-Schwarz / Varian 2007; the mechanism
-    under every sponsored-search slot).  Four bidders (values
-    16/12/8/4 per click), three slots (CTRs 10/6/3),
-    deterministic tie-breaking, and EVERY unilateral
-    deviation over the bid grid 0..20 evaluated under both
-    payment rules in one relational pass.  GSP (pay the next
-    bid): bidder 0 profits by SHADING to 8-11 — dropping to
-    slot 2 cuts the price more than the clicks (gain 8, the
-    classic demand-reduction witness; n_gsp_profitable == 4,
-    best deviation emitted).  VCG (pay your externality — the
-    per-slot Clarke payments): max_vcg_gain == 0 over the
-    same 84 deviations — truthfulness as a census, not a
-    claim.  The revenue comparison at truthful bids rides
-    along (GSP 180 vs VCG 132 — why ad platforms kept GSP).
-    Scale: the census is scenarios x bidders — mechanism
-    audits over real bid logs take the same shape."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q774_documents")
-    parts, fin = _q774_sql("q774_documents", "div", "")
-    done = []
-
-    def _qual(text):
-        for nm in done:
-            text = re.sub(rf"\b{nm}\b", f"q774_{nm}", text)
-        return text
-
-    kept = []
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        nm = fr.split(" AS ", 1)[0].strip()
-        if nm in ("bb", "rk", "ut"):
-            body = _qual(fr.split(" AS ", 1)[1].strip())[1:-1]
-            if nm == "bb":
-                body = ("WITH " + _qual(
-                    "bd AS (SELECT * FROM (VALUES (0, 16),"
-                    " (1, 12), (2, 8), (3, 4)) t(i, v)),\n"
-                    + [p for p in parts if
-                       p.startswith("sc AS")][0]
-                    .replace("{mat}", "").replace("{d}",
-                                                  "div"))
-                    + "\n" + body)
-            if nm == "ut":
-                body = ("WITH ct AS (SELECT * FROM (VALUES"
-                        " (0, 10), (1, 6), (2, 3), (3, 0))"
-                        " t(slot, ctr))\n" + body)
-            _pin_view(spark, body, f"q774_{nm}", max_rows=512)
-            done.append(nm)
-        else:
-            kept.append(_qual(fr))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + _qual(fin).replace("{d}",
-                                                  "div"))
-
-
-# ---------------------------------------------------------------------------
-# q775: LPT makespan — Graham's 4/3 - 1/(3m) bound met EXACTLY,
-# with OPT from a complete 3^7 assignment census
-
-
-def _q775_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # two 7-job instances on m = 3 machines; jobs listed
-        # in LPT (descending) order with rank = processing
-        # position
-        "jb AS (SELECT * FROM (VALUES\n"
-        "   (0, 0, 5), (0, 1, 5), (0, 2, 4), (0, 3, 4),\n"
-        "   (0, 4, 3), (0, 5, 3), (0, 6, 3),\n"
-        "   (1, 0, 8), (1, 1, 7), (1, 2, 6), (1, 3, 5),\n"
-        "   (1, 4, 4), (1, 5, 3), (1, 6, 2))"
-        " t(inst, rnk, p))",
-        "st0 AS{mat} (SELECT CAST(i.inst AS BIGINT) AS inst,\n"
-        "   CAST(m.m AS BIGINT) AS machine, CAST(0 AS BIGINT)"
-        " AS load\n"
-        "  FROM (SELECT DISTINCT inst FROM jb) i\n"
-        "  CROSS JOIN (SELECT CAST(x AS BIGINT) AS m FROM"
-        " (VALUES (0), (1), (2)) t(x)) m)",
-    ]
-    for t in range(1, 8):
-        parts.append(
-            f"st{t} AS{{mat}} (SELECT s.inst, s.machine,\n"
-            f"   s.load + CASE WHEN s.load * 4 + s.machine ="
-            f" a.mn\n"
-            f"     THEN j.p ELSE 0 END AS load\n"
-            f"  FROM st{t-1} s\n"
-            f"  JOIN (SELECT inst, CAST(min(load * 4 +"
-            f" machine) AS BIGINT) AS mn\n"
-            f"    FROM st{t-1} GROUP BY inst) a ON a.inst ="
-            f" s.inst\n"
-            f"  JOIN jb j ON j.inst = s.inst AND j.rnk ="
-            f" {t-1})")
-    parts += [
-        "lp AS (SELECT inst, CAST(max(load) AS BIGINT) AS"
-        " lpt_makespan\n"
-        "  FROM st7 GROUP BY inst)",
-        # complete census: all 3^7 assignments via two dims
-        f"xx AS (SELECT CAST(doc_id AS BIGINT) AS x"
-        f" FROM {tbl} WHERE doc_id < 27)",
-        f"yy AS (SELECT CAST(doc_id AS BIGINT) AS y"
-        f" FROM {tbl} WHERE doc_id < 81)",
-        "aa AS (SELECT x.x * 81 + y.y AS a FROM xx x CROSS"
-        " JOIN yy y)",
-        "ms AS{mat} (SELECT j.inst, z.a, mach,\n"
-        "   CAST(sum(j.p) AS BIGINT) AS load FROM\n"
-        "  (SELECT a.a, j2.inst, j2.rnk, j2.p,\n"
-        "    (a.a {d} (CASE j2.rnk WHEN 0 THEN 1 WHEN 1 THEN"
-        " 3 WHEN 2 THEN 9\n"
-        "      WHEN 3 THEN 27 WHEN 4 THEN 81 WHEN 5 THEN 243"
-        " ELSE 729 END)) % 3\n"
-        "      AS mach\n"
-        "   FROM aa a CROSS JOIN jb j2) z\n"
-        "  JOIN jb j ON j.inst = z.inst AND j.rnk = z.rnk\n"
-        "  GROUP BY j.inst, z.a, mach)",
-        "mk AS (SELECT inst, a, CAST(max(load) AS BIGINT) AS"
-        " mks\n"
-        "  FROM ms GROUP BY inst, a)",
-        "op AS (SELECT inst, CAST(min(mks) AS BIGINT) AS"
-        " opt_makespan\n"
-        "  FROM mk GROUP BY inst)",
-    ]
-    fin = (
-        "SELECT l.inst, l.lpt_makespan, o.opt_makespan,\n"
-        "  CASE WHEN 9 * l.lpt_makespan <= 11 *"
-        " o.opt_makespan\n"
-        "   THEN 1 ELSE 0 END AS bound_ok,\n"
-        "  CASE WHEN 9 * l.lpt_makespan = 11 *"
-        " o.opt_makespan\n"
-        "   THEN 1 ELSE 0 END AS bound_tight\n"
-        "FROM lp l JOIN op o ON o.inst = l.inst")
-    return parts, fin
-
-
-def _q775_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q775_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q775_lpt_makespan",
-       "WITH " + _q775_join("documents", "//", " MATERIALIZED"))
-def q775(spark, sf_dir):
-    """Graham's LPT bound (Graham 1969 — longest-processing-
-    time-first is (4/3 - 1/3m)-approximate for makespan; the
-    task-to-executor packing rule under every straggler-aware
-    scheduler) with OPT computed by COMPLETE census and the
-    bound certified EXACTLY TIGHT.  LPT runs as 7 unrolled
-    argmin stages (least-loaded machine, ties to the lowest
-    id, packed as load*4+machine); OPT comes from all 3^7 =
-    2187 assignments evaluated relationally.  The classical
-    tight instance (5,5,4,4,3,3,3 on 3 machines): LPT = 11 vs
-    OPT = 9 — and 9 * 11 == 11 * 9 makes bound_tight == 1:
-    the worst case of the 55-year-old bound reproduced
-    exactly, not approximately.  The second instance (8..2)
-    shows the typical regime: LPT 13 vs OPT 12, inside the
-    bound (bound_ok == 1) but not tight.  Scale: the census
-    is the certificate; LPT itself is one grouped argmin per
-    wave — the shape of real task placement."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q775_documents")
-    parts, fin = _q775_sql("q775_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _pin_view(spark, "WITH " + frags["jb"] + "\n" + body("st0"),
-              "q775_st0", max_rows=8)
-    for t in range(1, 8):
-        st = body(f"st{t}")
-        st = re.sub(rf"\bst{t-1}\b", f"q775_st{t-1}", st)
-        _pin_view(spark, "WITH " + frags["jb"] + "\n" + st,
-                  f"q775_st{t}", max_rows=8)
-    kept = [frags[n] for n in
-            ("jb", "xx", "yy", "aa", "ms", "mk", "op")]
-    kept.append(re.sub(r"\bst7\b", "q775_st7", frags["lp"]))
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q776: space-filling-curve range decomposition — bbox queries as
-# minimal index ranges, Hilbert vs Morton locality measured
-
-
-def _q776_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"ad AS (SELECT CAST(doc_id AS BIGINT) AS a"
-        f" FROM {tbl} WHERE doc_id < 32)",
-        "dd AS (SELECT a.a * 32 + b.a AS dh FROM ad a CROSS"
-        " JOIN ad b)",
-        "st0 AS (SELECT dh, CAST(0 AS BIGINT) AS x, CAST(0 AS"
-        " BIGINT) AS y, dh AS t FROM dd)",
-    ]
-    for s in (1, 2, 4, 8, 16):
-        prev = {1: 0, 2: 1, 4: 2, 8: 4, 16: 8}[s]
-        parts.append(
-            f"st{s} AS (SELECT dh,\n"
-            f"   CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN"
-            f" {s} - 1 - y ELSE y END)\n"
-            f"        ELSE x END + {s} * rx AS x,\n"
-            f"   CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN"
-            f" {s} - 1 - x ELSE x END)\n"
-            f"        ELSE y END + {s} * ry AS y,\n"
-            f"   t {{d}} 4 AS t\n"
-            f" FROM (SELECT dh, x, y, t, (t {{d}} 2) % 2 AS"
-            f" rx,\n"
-            f"         (t % 2 + (t {{d}} 2) % 2) % 2 AS ry\n"
-            f"       FROM st{prev}) b)")
-    parts += [
-        # Morton index by bit interleaving (pure arithmetic)
-        "mc AS{mat} (SELECT dh, x, y,\n"
-        "   (x % 2) + 2 * (y % 2)\n"
-        "   + 4 * ((x {d} 2) % 2) + 8 * ((y {d} 2) % 2)\n"
-        "   + 16 * ((x {d} 4) % 2) + 32 * ((y {d} 4) % 2)\n"
-        "   + 64 * ((x {d} 8) % 2) + 128 * ((y {d} 8) % 2)\n"
-        "   + 256 * ((x {d} 16) % 2) + 512 * ((y {d} 16) %"
-        " 2) AS dm\n"
-        "  FROM st16)",
-        "bx AS (SELECT * FROM (VALUES (0, 3, 12, 5, 14),\n"
-        "   (1, 0, 31, 7, 9), (2, 20, 27, 20, 27),\n"
-        "   (3, 10, 11, 0, 31)) t(box, x0, x1, y0, y1))",
-        # cells of each box on each curve, long format
-        "cl AS{mat} (SELECT b.box, 0 AS curve, m.dh AS idx\n"
-        "  FROM bx b JOIN mc m ON m.x BETWEEN b.x0 AND b.x1\n"
-        "    AND m.y BETWEEN b.y0 AND b.y1\n"
-        "  UNION ALL\n"
-        "  SELECT b.box, 1, m.dm\n"
-        "  FROM bx b JOIN mc m ON m.x BETWEEN b.x0 AND b.x1\n"
-        "    AND m.y BETWEEN b.y0 AND b.y1)",
-        # islands: consecutive index runs are ranges
-        "is2 AS (SELECT box, curve, idx,\n"
-        "   idx - row_number() OVER (PARTITION BY box, curve\n"
-        "     ORDER BY idx) AS grp FROM cl)",
-        "rg AS{mat} (SELECT box, curve, grp,\n"
-        "   CAST(min(idx) AS BIGINT) AS lo, CAST(max(idx) AS"
-        " BIGINT) AS hi,\n"
-        "   CAST(count(*) AS BIGINT) AS len FROM is2\n"
-        "  GROUP BY box, curve, grp)",
-        # coverage + disjointness certificates
-        "cc AS (SELECT r.box, r.curve,\n"
-        "   CAST(count(*) AS BIGINT) AS n_ranges,\n"
-        "   CAST(sum(r.len) AS BIGINT) AS covered,\n"
-        "   CAST(sum(r.hi - r.lo + 1 - r.len) AS BIGINT) AS"
-        " density_viol\n"
-        "  FROM rg r GROUP BY r.box, r.curve)",
-        "nc AS (SELECT box, CAST(count(*) AS BIGINT) {d} 2 AS"
-        " n_cells\n"
-        "  FROM cl GROUP BY box)",
-        "ov AS (SELECT CAST(coalesce(sum(CASE WHEN b.lo <="
-        " a.hi THEN 1 ELSE 0 END), 0)\n"
-        "   AS BIGINT) AS overlap_viol\n"
-        "  FROM rg a JOIN rg b ON b.box = a.box AND b.curve ="
-        " a.curve\n"
-        "   AND b.lo > a.lo)".replace(
-            "b.lo > a.lo", "b.lo > a.lo AND b.lo <= a.hi")
-        .replace("CASE WHEN b.lo <= a.hi THEN 1 ELSE 0 END",
-                 "1"),
-    ]
-    fin = (
-        "SELECT h.box, n.n_cells,\n"
-        "  h.n_ranges AS hilbert_ranges,\n"
-        "  m.n_ranges AS morton_ranges,\n"
-        "  h.covered - n.n_cells AS hcover_viol,\n"
-        "  m.covered - n.n_cells AS mcover_viol,\n"
-        "  h.density_viol + m.density_viol AS density_viol,\n"
-        "  o.overlap_viol\n"
-        "FROM cc h JOIN cc m ON m.box = h.box AND m.curve ="
-        " 1\n"
-        "JOIN nc n ON n.box = h.box\n"
-        "CROSS JOIN ov o\n"
-        "WHERE h.curve = 0")
-    return parts, fin
-
-
-def _q776_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q776_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q776_sfc_range_decomposition",
-       "WITH " + _q776_join("documents", "//", " MATERIALIZED"))
-def q776(spark, sf_dir):
-    """Space-filling-curve RANGE DECOMPOSITION — how a bbox
-    query becomes index-range scans, the primitive under this
-    engine's Hilbert-clustered row-group skipping (q30/q89/
-    q384) and every SFC-indexed store (S2, H3 compact covers,
-    GeoMesa).  The full 32x32 Hilbert mapping (the q743
-    stages) and a Morton mapping by pure bit-interleave
-    arithmetic are both decomposed over four query boxes —
-    compact, wide-strip, square, tall-strip — into MAXIMAL
-    consecutive index ranges via the islands trick (idx minus
-    row_number is constant on a run).  Certificates: every
-    decomposition covers exactly the box's cells (cover_viol
-    == 0), ranges are internally dense (density_viol == 0 —
-    min/max/count agree) and mutually disjoint (overlap_viol
-    == 0).  The payload is the locality comparison: range
-    counts per curve per box — fewer ranges means fewer scan
-    seeks, and the shapes where Hilbert's continuity beats
-    Morton's Z-jumps (and where it doesn't) are visible in
-    one table.  Scale: decomposition is a sort + islands
-    grouping over the box's cells; at depth-20 curves the
-    same plan runs over cell COVERS, not cells."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q776_documents")
-    parts, fin = _q776_sql("q776_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    chain = ",\n".join(frags[n] for n in
-                       ("ad", "dd", "st0", "st1", "st2", "st4",
-                        "st8", "st16"))
-    _pin_view(spark, "WITH " + chain + "\n" + body("mc"),
-              "q776_mc", max_rows=1100)
-    _pin_view(spark, "WITH " + frags["bx"] + "\n"
-              + re.sub(r"\bmc\b", "q776_mc", body("cl")),
-              "q776_cl", max_rows=4096)
-    kept = [re.sub(r"\bcl\b", "q776_cl", frags[n])
-            for n in ("is2", "rg", "cc", "nc", "ov")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q777: content-defined chunking shift resistance — one inserted
-# byte, CDC keeps everything but the edit, fixed blocks keep nothing
-
-
-def _q777_sql(tbl: str, d: str, mat: str):
-    pw = " ".join(f"WHEN {i} THEN {w}"
-                  for i, w in enumerate(_Q751_POW))
-    parts = [
-        f"vs AS (SELECT CAST(doc_id AS BIGINT) AS did,\n"
-        f"   CAST(v.v AS BIGINT) AS ver,\n"
-        f"   CASE WHEN v.v = 0 THEN text ELSE 'Z' || text END"
-        f" AS s\n"
-        f"  FROM {tbl} CROSS JOIN (VALUES (0), (1)) v(v)\n"
-        f"  WHERE doc_id < 12)",
-        f"pa AS (SELECT CAST(doc_id AS BIGINT) AS a"
-        f" FROM {tbl} WHERE doc_id < 300)",
-        f"pb AS (SELECT CAST(doc_id AS BIGINT) AS b"
-        f" FROM {tbl} WHERE doc_id < 2)",
-        "pp AS (SELECT a.a * 2 + b.b + 1 AS p FROM pa a CROSS"
-        " JOIN pb b)",
-        "cs AS{mat} (SELECT v.did, v.ver, p.p,\n"
-        "   CAST(ascii(substr(v.s, CAST(p.p AS INT), 1)) AS"
-        " BIGINT) AS c\n"
-        "  FROM vs v JOIN pp p ON p.p <= length(v.s))",
-        # the q308 rolling polynomial over the 8 chars ending
-        # at p; boundary when hash % 64 == 0
-        "bd AS{mat} (SELECT did, ver, p,\n"
-        "   CASE WHEN c0.p >= 8 AND (c0.c + c1.c * 31 + c2.c *"
-        " 961\n"
-        "     + c3.c * 29791 + c4.c * 923521 + c5.c *"
-        " 28629151\n"
-        "     + c6.c * 887503681 + c7.c * 27512614111) % 64 ="
-        " 0\n"
-        "    THEN 1 ELSE 0 END AS flag\n"
-        "  FROM (SELECT x.did, x.ver, x.p, x.c AS c FROM cs"
-        " x) c0\n"
-        "  LEFT JOIN cs c1 ON c1.did = c0.did AND c1.ver ="
-        " c0.ver AND c1.p = c0.p - 1\n"
-        "  LEFT JOIN cs c2 ON c2.did = c0.did AND c2.ver ="
-        " c0.ver AND c2.p = c0.p - 2\n"
-        "  LEFT JOIN cs c3 ON c3.did = c0.did AND c3.ver ="
-        " c0.ver AND c3.p = c0.p - 3\n"
-        "  LEFT JOIN cs c4 ON c4.did = c0.did AND c4.ver ="
-        " c0.ver AND c4.p = c0.p - 4\n"
-        "  LEFT JOIN cs c5 ON c5.did = c0.did AND c5.ver ="
-        " c0.ver AND c5.p = c0.p - 5\n"
-        "  LEFT JOIN cs c6 ON c6.did = c0.did AND c6.ver ="
-        " c0.ver AND c6.p = c0.p - 6\n"
-        "  LEFT JOIN cs c7 ON c7.did = c0.did AND c7.ver ="
-        " c0.ver AND c7.p = c0.p - 7)"
-        .replace("SELECT did, ver, p,",
-                 "SELECT c0.did, c0.ver, c0.p,"),
-        # chunk index per position = boundaries strictly before
-        "ci AS{mat} (SELECT s.did, s.ver, s.p, s.c,\n"
-        "   coalesce(sum(b.flag) OVER (PARTITION BY s.did,"
-        " s.ver\n"
-        "     ORDER BY s.p ROWS BETWEEN UNBOUNDED PRECEDING"
-        " AND 1 PRECEDING),\n"
-        "     0) AS cid,\n"
-        "   (s.p - 1) {d} 32 AS bid\n"
-        "  FROM cs s JOIN bd b ON b.did = s.did AND b.ver ="
-        " s.ver AND b.p = s.p)",
-        # chunk fingerprints: length + relative-position
-        # polynomial checksum (identical content => identical
-        # fingerprint regardless of absolute offset)
-        "ck AS{mat} (SELECT did, ver, cid,\n"
-        "   CAST(count(*) AS BIGINT) AS ln,\n"
-        "   CAST(sum(c * CASE CAST((p - mp) % 16 AS INT) "
-        + pw + " END) % 1000003 AS BIGINT) AS chk\n"
-        "  FROM (SELECT did, ver, cid, p, c,\n"
-        "     min(p) OVER (PARTITION BY did, ver, cid) AS mp\n"
-        "    FROM ci) z GROUP BY did, ver, cid)",
-        "fk AS{mat} (SELECT did, ver, bid,\n"
-        "   CAST(count(*) AS BIGINT) AS ln,\n"
-        "   CAST(sum(c * CASE CAST((p - 1) % 32 % 16 AS INT) "
-        + pw + " END) % 1000003 AS BIGINT) AS chk\n"
-        "  FROM ci GROUP BY did, ver, bid)",
-        # multiplicity-aware sharing (Counter-min semantics)
-        "sh AS (SELECT a.did,\n"
-        "   CAST(sum(least(a.n, coalesce(b.n, 0))) AS BIGINT)"
-        " AS cdc_shared\n"
-        "  FROM (SELECT did, ln, chk, CAST(count(*) AS"
-        " BIGINT) AS n\n"
-        "    FROM ck WHERE ver = 0 GROUP BY did, ln, chk) a\n"
-        "  LEFT JOIN (SELECT did, ln, chk, CAST(count(*) AS"
-        " BIGINT) AS n\n"
-        "    FROM ck WHERE ver = 1 GROUP BY did, ln, chk) b\n"
-        "   ON b.did = a.did AND b.ln = a.ln AND b.chk ="
-        " a.chk\n"
-        "  GROUP BY a.did)",
-        "sf AS (SELECT a.did,\n"
-        "   CAST(sum(least(a.n, coalesce(b.n, 0))) AS BIGINT)"
-        " AS fixed_shared\n"
-        "  FROM (SELECT did, ln, chk, CAST(count(*) AS"
-        " BIGINT) AS n\n"
-        "    FROM fk WHERE ver = 0 GROUP BY did, ln, chk) a\n"
-        "  LEFT JOIN (SELECT did, ln, chk, CAST(count(*) AS"
-        " BIGINT) AS n\n"
-        "    FROM fk WHERE ver = 1 GROUP BY did, ln, chk) b\n"
-        "   ON b.did = a.did AND b.ln = a.ln AND b.chk ="
-        " a.chk\n"
-        "  GROUP BY a.did)",
-        "cn AS (SELECT did,\n"
-        "   CAST(sum(CASE WHEN ver = 0 THEN 1 ELSE 0 END) AS"
-        " BIGINT) AS n_chunks_a,\n"
-        "   CAST(sum(CASE WHEN ver = 1 THEN 1 ELSE 0 END) AS"
-        " BIGINT) AS n_chunks_b\n"
-        "  FROM ck GROUP BY did)",
-        "fb AS (SELECT did, CAST(sum(CASE WHEN ver = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "   AS BIGINT) AS n_blocks_a FROM fk GROUP BY did)",
-        # boundary shift: every version-A boundary reappears
-        # one position later in version B
-        "bs AS (SELECT CAST(sum(CASE WHEN b2.flag IS NULL OR"
-        " b2.flag = 0\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS shift_viol\n"
-        "  FROM bd a LEFT JOIN bd b2 ON b2.did = a.did AND"
-        " b2.ver = 1\n"
-        "    AND b2.p = a.p + 1\n"
-        "  WHERE a.ver = 0 AND a.flag = 1)",
-    ]
-    fin = (
-        "SELECT c.did, c.n_chunks_a, c.n_chunks_b,\n"
-        "  s.cdc_shared, f.n_blocks_a, sf.fixed_shared,\n"
-        "  CASE WHEN c.n_chunks_a - s.cdc_shared <= 1 THEN 1"
-        " ELSE 0 END\n"
-        "    AS cdc_resist_ok,\n"
-        "  b.shift_viol\n"
-        "FROM cn c JOIN sh s ON s.did = c.did\n"
-        "JOIN fb f ON f.did = c.did\n"
-        "JOIN sf ON sf.did = c.did\n"
-        "CROSS JOIN bs b")
-    return parts, fin
-
-
-def _q777_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q777_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q777_cdc_shift_resistance",
-       "WITH " + _q777_join("documents", "//", " MATERIALIZED"))
-def q777(spark, sf_dir):
-    """WHY content-defined chunking exists (Muthitacharoen's
-    LBFS 2001; the dedup boundary rule behind rsync-style
-    storage, q308's boundary census completed with its
-    raison d'etre): insert ONE byte at the front of each of
-    12 real documents and measure what survives.  Boundaries
-    come from the q308 rolling polynomial (hash of the 8
-    chars ending at p, %64 == 0); chunks are fingerprinted by
-    length + a RELATIVE-position checksum so identical
-    content matches at any offset, and sharing is counted
-    with Counter-min multiplicity.  CDC: every version-A
-    boundary reappears exactly one position later in B
-    (shift_viol == 0 — the hash window sees the same bytes),
-    so all chunks after the first survive: n_chunks_a -
-    cdc_shared <= 1 on every document (cdc_resist_ok == 1;
-    80 of 92 chunks shared overall).  Fixed 32-byte blocks:
-    the single inserted byte shifts every block content —
-    fixed_shared == 0 across all documents.  One byte, total
-    loss versus near-total survival: the entire argument for
-    content-defined boundaries in one table.  Scale: hashing
-    and chunk stats are window passes; the sharing join is on
-    (length, fingerprint) — the dedup-store key."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q777_documents")
-    parts, fin = _q777_sql("q777_documents", "div", "")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    dims = ",\n".join(frags[n] for n in
-                      ("vs", "pa", "pb", "pp"))
-    _ckpt_view(spark, "WITH " + dims + "\n" + body("cs"),
-               "q777_cs")
-    _ckpt_view(spark, "WITH cs AS (SELECT * FROM q777_cs)\n"
-               + body("bd"), "q777_bd")
-    _ckpt_view(spark,
-               "WITH cs AS (SELECT * FROM q777_cs),\n"
-               "bd AS (SELECT * FROM q777_bd)\n" + body("ci"),
-               "q777_ci")
-    kept = [re.sub(r"\bci\b", "q777_ci", frags[n])
-            for n in ("ck", "fk")]
-    kept += [re.sub(r"\bbd\b", "q777_bd", frags["bs"])]
-    kept += [frags[n] for n in ("sh", "sf", "cn", "fb")]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q778: stream-stream join state retention — eviction by watermark,
-# lost-pair census, and the delay/completeness dial
-
-
-def _q778_sql(tbl: str, d: str, mat: str, es: str):
-    parts = [
-        # left/right streams by event parity; arrival = event
-        # time + planted skew (every 13th right event is 4 hours
-        # late)
-        "ev AS{mat} (SELECT CAST(event_id AS BIGINT) AS eid,\n"
-        "   CAST(user_id AS BIGINT) AS u, {es} AS et,\n"
-        "   {es} + CASE WHEN event_id % 13 = 0 AND event_id %"
-        " 2 = 1\n"
-        "     THEN 14400 ELSE (event_id * 7) % 60 END AS at2,\n"
-        "   CAST(event_id % 2 AS BIGINT) AS side\n"
-        "  FROM events WHERE event_id < 4000)",
-        # the full (offline) interval join: same user, right
-        # event within 2 hours before the left event
-        "fj AS{mat} (SELECT l.eid AS lid, r.eid AS rid\n"
-        "  FROM ev l JOIN ev r ON r.u = l.u AND r.side = 1"
-        " AND l.side = 0\n"
-        "   AND r.et <= l.et AND r.et >= l.et - 7200)",
-        # watermark at each arrival (global, over both streams)
-        "wm AS{mat} (SELECT eid, u, et, at2, side,\n"
-        "   max(et) OVER (ORDER BY at2, eid ROWS BETWEEN"
-        " UNBOUNDED\n"
-        "     PRECEDING AND CURRENT ROW) AS wmk FROM ev)",
-        "dl AS (SELECT CAST(x AS BIGINT) AS delay FROM"
-        " (VALUES (600), (10800), (86400)) t(x))",
-        # a pair is KEPT iff when the later element arrives,
-        # the earlier one has not been evicted: evict right
-        # rows once watermark - delay > r.et + 300
-        "kp AS (SELECT d.delay, f.lid, f.rid\n"
-        "  FROM fj f CROSS JOIN dl d\n"
-        "  JOIN wm l ON l.eid = f.lid JOIN wm r ON r.eid ="
-        " f.rid\n"
-        "  WHERE (CASE WHEN l.at2 >= r.at2 THEN l.wmk ELSE"
-        " r.wmk END)\n"
-        "    - d.delay <= (CASE WHEN l.at2 >= r.at2 THEN r.et"
-        " + 7200\n"
-        "    ELSE l.et END))",
-        "ac AS (SELECT d.delay,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM fj) AS"
-        " full_pairs,\n"
-        "   CAST(count(k.lid) AS BIGINT) AS kept_pairs\n"
-        "  FROM dl d LEFT JOIN kp k ON k.delay = d.delay\n"
-        "  GROUP BY d.delay)",
-        # state-size census: retained right-side rows at each
-        # of 4 probe arrival points under delay 600
-        "pb AS (SELECT CAST(x AS BIGINT) AS frac FROM (VALUES"
-        " (1), (2), (3)) t(x))",
-        "bo AS (SELECT CAST(max(at2) AS BIGINT) AS mx,\n"
-        "   CAST(min(at2) AS BIGINT) AS mn FROM ev)",
-        "pt2 AS (SELECT p.frac,\n"
-        "   b.mn + (b.mx - b.mn) * p.frac {d} 4 AS cutoff\n"
-        "  FROM pb p CROSS JOIN bo b)",
-        "pw AS (SELECT t.frac, t.cutoff,\n"
-        "   CAST(max(w2.wmk) AS BIGINT) AS wm_at\n"
-        "  FROM pt2 t JOIN wm w2 ON w2.at2 <= t.cutoff\n"
-        "  GROUP BY t.frac, t.cutoff)",
-        "sz AS (SELECT w.frac,\n"
-        "   CAST(count(*) AS BIGINT) AS retained_right\n"
-        "  FROM pw w JOIN wm r ON r.side = 1\n"
-        "   AND r.at2 <= w.cutoff\n"
-        "   AND r.et + 7200 >= w.wm_at - 7200\n"
-        "  GROUP BY w.frac)",
-        "mv AS (SELECT CASE WHEN\n"
-        "   (SELECT kept_pairs FROM ac WHERE delay = 600) <=\n"
-        "   (SELECT kept_pairs FROM ac WHERE delay = 10800)"
-        " AND\n"
-        "   (SELECT kept_pairs FROM ac WHERE delay = 10800)"
-        " <=\n"
-        "   (SELECT kept_pairs FROM ac WHERE delay = 86400)\n"
-        "   THEN 0 ELSE 1 END AS monotone_viol)",
-    ]
-    parts = [p.replace("{es}", es) for p in parts]
-    fin = (
-        "SELECT a.delay, a.full_pairs, a.kept_pairs,\n"
-        "  a.full_pairs - a.kept_pairs AS lost_pairs,\n"
-        "  m.monotone_viol,\n"
-        "  (SELECT retained_right FROM sz WHERE frac = 2) AS"
-        " state_mid\n"
-        "FROM ac a CROSS JOIN mv m")
-    return parts, fin
-
-
-def _q778_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q778_sql(tbl, d, mat,
-                           "CAST(floor(epoch(ts)) AS BIGINT)")
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q778_stream_join_state",
-       "WITH " + _q778_join("documents", "//", " MATERIALIZED"))
-def q778(spark, sf_dir):
-    """Stream-stream interval-join state retention — the
-    eviction arithmetic under Structured Streaming's
-    stream-stream joins: state must hold a right-side row
-    until the watermark guarantees no future left partner,
-    and evicting earlier LOSES exactly the pairs whose late
-    partner arrives after eviction.  The offline (full)
-    interval join over the real events table is ground truth;
-    the kept-pair predicate replays the runtime rule — a pair
-    survives iff, at the LATER element's arrival, the
-    watermark minus delay has not passed the earlier
-    element's liveness horizon (et + 7200).  Three delay
-    settings show the dial: completeness is MONOTONE in the
-    delay (monotone_viol == 0) and the lost-pair census is
-    exact — every 13th right event arrives four hours late,
-    and short delays drop exactly the joins it participates
-    in.  The mid-stream state-size probe quantifies what the
-    longer delay costs: retained right-side rows at the
-    watermark frontier.  Scale: the census is a three-way
-    join over (pair, policy) — the same audit a production
-    pipeline should run on sampled traffic before choosing
-    its watermark delay."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
-        "events")
-    parts, fin = _q778_sql("events", "div", "",
-                           "CAST(unix_timestamp(ts) AS"
-                           " BIGINT)")
-    frags = {}
-    for fr in parts:
-        fr = fr.replace("{mat}", "").replace("{d}", "div")
-        frags[fr.split(" AS ", 1)[0].strip()] = fr
-
-    def body(nm):
-        return frags[nm].split(" AS ", 1)[1].strip()[1:-1]
-
-    _ckpt_view(spark, body("ev"), "q778_ev")
-    _ckpt_view(spark, re.sub(r"\bev\b", "q778_ev",
-                             body("fj")), "q778_fj")
-    _ckpt_view(spark, re.sub(r"\bev\b", "q778_ev",
-                             body("wm")), "q778_wm")
-    kept = []
-    for nm in ("dl", "kp", "ac", "pb", "bo", "pt2", "pw",
-               "sz", "mv"):
-        t = frags[nm]
-        t = re.sub(r"\bfj\b", "q778_fj", t)
-        t = re.sub(r"\bwm\b", "q778_wm", t)
-        t = re.sub(r"\bev\b", "q778_ev", t)
-        kept.append(t)
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q779: LSM tombstone discipline — merge-then-purge is correct,
-# purge-then-merge resurrects deleted keys
-
-
-def _q779_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # op log from events: seq = event_id, key = user id,
-        # every 7th op is a DELETE tombstone, else an upsert
-        "ops AS{mat} (SELECT CAST(event_id AS BIGINT) AS"
-        " seq,\n"
-        "   CAST(user_id AS BIGINT) AS k,\n"
-        "   CASE WHEN event_id % 7 = 0 THEN 1 ELSE 0 END AS"
-        " tomb,\n"
-        "   CAST(event_id AS BIGINT) AS val,\n"
-        "   CAST(event_id % 3 AS BIGINT) AS seg\n"
-        "  FROM events WHERE event_id < 3000)",
-        # ground truth: last op per key wins; visible iff not
-        # a tombstone
-        "gt AS (SELECT k, CAST(max_by(val, seq) AS BIGINT) AS"
-        " val,\n"
-        "   CAST(max_by(tomb, seq) AS BIGINT) AS tomb\n"
-        "  FROM ops GROUP BY k)",
-        # segment-local compaction (last op per key per
-        # segment, tombstones RETAINED)
-        "sgc AS{mat} (SELECT seg, k,\n"
-        "   CAST(max(seq) AS BIGINT) AS seq,\n"
-        "   CAST(max_by(val, seq) AS BIGINT) AS val,\n"
-        "   CAST(max_by(tomb, seq) AS BIGINT) AS tomb\n"
-        "  FROM ops GROUP BY seg, k)",
-        # full merge of the compacted segments, then purge:
-        # correct by construction — certified equal to truth
-        "mg AS (SELECT k, CAST(max_by(val, seq) AS BIGINT) AS"
-        " val,\n"
-        "   CAST(max_by(tomb, seq) AS BIGINT) AS tomb\n"
-        "  FROM sgc GROUP BY k)",
-        "c1 AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " merge_purge_viol FROM\n"
-        "  (SELECT k, val FROM mg WHERE tomb = 0) a\n"
-        "  FULL OUTER JOIN (SELECT k, val FROM gt WHERE tomb"
-        " = 0) b\n"
-        "   ON b.k = a.k AND b.val = a.val\n"
-        "  WHERE a.k IS NULL OR b.k IS NULL)",
-        # the WRONG order: purge tombstones per segment first,
-        # then merge — deletions whose tombstone was the
-        # segment-last op vanish, and an older upsert from
-        # another segment RESURRECTS the key
-        "bad AS (SELECT k, CAST(max_by(val, seq) AS BIGINT)"
-        " AS val\n"
-        "  FROM sgc WHERE tomb = 0 GROUP BY k)",
-        "c2 AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " resurrected FROM\n"
-        "  bad a JOIN gt g ON g.k = a.k AND g.tomb = 1)",
-        # associativity of merge: ((s0+s1)+s2) == (s0+(s1+s2))
-        "m01 AS (SELECT k, CAST(max(seq) AS BIGINT) AS seq,\n"
-        "   CAST(max_by(val, seq) AS BIGINT) AS val,\n"
-        "   CAST(max_by(tomb, seq) AS BIGINT) AS tomb\n"
-        "  FROM sgc WHERE seg <= 1 GROUP BY k)",
-        "m12 AS (SELECT k, CAST(max(seq) AS BIGINT) AS seq,\n"
-        "   CAST(max_by(val, seq) AS BIGINT) AS val,\n"
-        "   CAST(max_by(tomb, seq) AS BIGINT) AS tomb\n"
-        "  FROM sgc WHERE seg >= 1 GROUP BY k)",
-        "ma AS (SELECT k, CAST(max_by(val, seq) AS BIGINT) AS"
-        " val,\n"
-        "   CAST(max_by(tomb, seq) AS BIGINT) AS tomb FROM\n"
-        "  (SELECT k, seq, val, tomb FROM m01 UNION ALL\n"
-        "   SELECT k, seq, val, tomb FROM sgc WHERE seg = 2)"
-        " z GROUP BY k)",
-        "mb AS (SELECT k, CAST(max_by(val, seq) AS BIGINT) AS"
-        " val,\n"
-        "   CAST(max_by(tomb, seq) AS BIGINT) AS tomb FROM\n"
-        "  (SELECT k, seq, val, tomb FROM m12 UNION ALL\n"
-        "   SELECT k, seq, val, tomb FROM sgc WHERE seg = 0)"
-        " z GROUP BY k)",
-        "c3 AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " assoc_viol FROM\n"
-        "  ma a FULL OUTER JOIN mb b ON b.k = a.k AND b.val ="
-        " a.val\n"
-        "   AND b.tomb = a.tomb\n"
-        "  WHERE a.k IS NULL OR b.k IS NULL)",
-        "ns AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM gt WHERE"
-        " tomb = 0)\n"
-        "     AS n_live,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM gt WHERE"
-        " tomb = 1)\n"
-        "     AS n_deleted,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM sgc) AS"
-        " n_segment_rows)",
-    ]
-    fin = (
-        "SELECT n.n_live, n.n_deleted, n.n_segment_rows,\n"
-        "  a.merge_purge_viol, b.resurrected, c.assoc_viol\n"
-        "FROM ns n CROSS JOIN c1 a CROSS JOIN c2 b\n"
-        "CROSS JOIN c3 c")
-    return parts, fin
-
-
-def _q779_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q779_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q779_tombstone_discipline",
-       "WITH " + _q779_join("documents", "//", " MATERIALIZED"))
-def q779(spark, sf_dir):
-    """LSM tombstone discipline (the rule every RocksDB/
-    Cassandra/Lucene compaction obeys: a deletion marker may
-    only be dropped at FULL-overlap compaction) certified by
-    running both orders on a real op log.  3000 ops over 150
-    keys in 3 segments, every 7th op a tombstone;
-    segment-local compaction keeps last-op-per-key WITH
-    tombstones.  Merge-then-purge equals the direct ground
-    truth exactly (merge_purge_viol == 0).  Purge-then-merge
-    — dropping tombstones per segment before merging — lets
-    older upserts from other segments RESURRECT deleted keys:
-    the census counts exactly how many (resurrected > 0), the
-    data form of why tombstones must outlive every older
-    version of their key.  Merge ASSOCIATIVITY rides along:
-    ((s0+s1)+s2) == (s0+(s1+s2)) key-for-key (assoc_viol ==
-    0), the property that lets compaction trees pick any
-    shape.  Scale: every machine here is last-writer-wins
-    max_by per key — map-side combinable; the audit shape for
-    any log-structured store."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
-        "events")
-    parts, fin = _q779_sql("events", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q780: partition-spec evolution — day files before the cutover,
-# hour files after; spanning reads certified exact
-
-
-def _q780_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "ev AS{mat} (SELECT CAST(event_id AS BIGINT) AS eid,\n"
-        "   {es} AS es, CAST(event_id % 7 AS BIGINT) AS w\n"
-        "  FROM events)",
-        # cutover epoch: 2024-01-07 00:00 UTC; spec 1 = day
-        # partitions before, spec 2 = hour partitions after
-        "cv AS (SELECT CAST(1704585600 AS BIGINT) AS cut)",
-        "rw AS{mat} (SELECT e.eid, e.es, e.w,\n"
-        "   CASE WHEN e.es < c.cut THEN 1 ELSE 2 END AS"
-        " spec,\n"
-        "   CASE WHEN e.es < c.cut THEN e.es {d} 86400\n"
-        "        ELSE e.es {d} 3600 END AS pkey\n"
-        "  FROM ev e CROSS JOIN cv c)",
-        # every row lands in exactly one file
-        "uq AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,\n"
-        "   CAST(count(DISTINCT eid) AS BIGINT) AS n_distinct\n"
-        "  FROM rw)",
-        "fl AS (SELECT spec, pkey, CAST(count(*) AS BIGINT)"
-        " AS n,\n"
-        "   CAST(min(es) AS BIGINT) AS lo, CAST(max(es) AS"
-        " BIGINT) AS hi\n"
-        "  FROM rw GROUP BY spec, pkey)",
-        # the query range spans the cutover: Jan 6 12:00 to
-        # Jan 7 18:00
-        "qr AS (SELECT CAST(1704542400 AS BIGINT) AS qa,\n"
-        "   CAST(1704650400 AS BIGINT) AS qb)",
-        # planner: select files whose partition interval
-        # overlaps the range, per spec
-        "sel AS (SELECT f.spec, f.pkey, f.n FROM fl f CROSS"
-        " JOIN qr q\n"
-        "  WHERE (f.spec = 1 AND f.pkey * 86400 < q.qb\n"
-        "     AND (f.pkey + 1) * 86400 > q.qa)\n"
-        "     OR (f.spec = 2 AND f.pkey * 3600 < q.qb\n"
-        "     AND (f.pkey + 1) * 3600 > q.qa))",
-        # rows read via selected files + residual filter
-        "rd AS (SELECT r.eid, r.es, r.w FROM rw r JOIN sel s\n"
-        "  ON s.spec = r.spec AND s.pkey = r.pkey)",
-        "ft AS (SELECT CAST(count(*) AS BIGINT) AS kept,\n"
-        "   CAST(sum(w) AS BIGINT) AS wsum\n"
-        "  FROM rd CROSS JOIN qr q WHERE es >= q.qa AND es <"
-        " q.qb)",
-        # ground truth: direct range scan
-        "gt AS (SELECT CAST(count(*) AS BIGINT) AS kept,\n"
-        "   CAST(sum(w) AS BIGINT) AS wsum\n"
-        "  FROM rw CROSS JOIN qr q WHERE es >= q.qa AND es <"
-        " q.qb)",
-        "ct AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM sel WHERE"
-        " spec = 1) AS day_files_read,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM sel WHERE"
-        " spec = 2) AS hour_files_read,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM fl WHERE"
-        " spec = 1) AS day_files_total,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM fl WHERE"
-        " spec = 2) AS hour_files_total,\n"
-        "   (SELECT CAST(sum(n) AS BIGINT) FROM sel) AS"
-        " rows_scanned)",
-    ]
-    fin = (
-        "SELECT c.day_files_read, c.hour_files_read,\n"
-        "  c.day_files_total, c.hour_files_total,\n"
-        "  c.rows_scanned, g.kept, g.wsum,\n"
-        "  f.kept - g.kept AS count_viol,\n"
-        "  f.wsum - g.wsum AS sum_viol,\n"
-        "  u.n_rows - u.n_distinct AS placement_viol,\n"
-        "  c.rows_scanned - g.kept AS residual_rows\n"
-        "FROM ct c CROSS JOIN ft f CROSS JOIN gt g\n"
-        "CROSS JOIN uq u")
-    return parts, fin
-
-
-def _q780_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q780_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           .replace("{es}", "CAST(floor(epoch(ts)) AS BIGINT)")
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q780_partition_evolution",
-       "WITH " + _q780_join("documents", "//", " MATERIALIZED"))
-def q780(spark, sf_dir):
-    """Partition-spec EVOLUTION (Iceberg's hidden
-    partitioning: start with day(ts) files, evolve to
-    hour(ts) at a cutover, and old files are never rewritten
-    — the exact situation plans/manifest.py's snapshots model)
-    with a spanning read certified correct.  Every event
-    lands in exactly one file (day-keyed before the cutover,
-    hour-keyed after; placement_viol == 0), and a query range
-    straddling the cutover is planned per spec: day files by
-    day-interval overlap, hour files by hour-interval overlap.
-    Certificates: the planner's scan plus residual filter
-    reproduces the direct range scan EXACTLY (count_viol ==
-    sum_viol == 0 on both the row count and a weighted sum),
-    no row is read from two files, and the pruning ledger is
-    emitted — files read per spec vs totals, rows scanned vs
-    rows kept (residual_rows is what the coarser day
-    partitions over-read; the cost evolution exists to
-    reduce).  Scale: planning is metadata-only (the fl table
-    IS the manifest); correctness is independent of which
-    spec wrote which era — the property that makes in-place
-    spec evolution safe at all."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
-        "events")
-    parts, fin = _q780_sql("events", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            .replace("{es}", "CAST(unix_timestamp(ts) AS"
-                     " BIGINT)")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q781: RANGE vs ROWS window frames — the peer-group difference
-# certified by an independent later-peer sum
-
-
-def _q781_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # order key deliberately NON-UNIQUE: the epoch minute
-        "ev AS{mat} (SELECT CAST(event_id AS BIGINT) AS eid,\n"
-        "   {es} {d} 60 AS mnt,\n"
-        "   CAST(event_id % 7 AS BIGINT) AS w\n"
-        "  FROM events WHERE event_id < 3000)",
-        "cm AS{mat} (SELECT eid, mnt, w,\n"
-        "   sum(w) OVER (ORDER BY mnt RANGE BETWEEN UNBOUNDED"
-        " PRECEDING\n"
-        "     AND CURRENT ROW) AS cum_range,\n"
-        "   sum(w) OVER (ORDER BY mnt, eid ROWS BETWEEN"
-        " UNBOUNDED PRECEDING\n"
-        "     AND CURRENT ROW) AS cum_rows,\n"
-        "   sum(w) OVER (PARTITION BY mnt) AS peer_sum,\n"
-        "   sum(w) OVER (PARTITION BY mnt ORDER BY eid ROWS"
-        " BETWEEN\n"
-        "     UNBOUNDED PRECEDING AND CURRENT ROW) AS"
-        " peer_prefix,\n"
-        "   count(*) OVER (PARTITION BY mnt) AS peer_n\n"
-        "  FROM ev)",
-        # THE identity: RANGE cumsum minus ROWS cumsum equals
-        # the weight of LATER peers in the same key group
-        "ck AS (SELECT CAST(sum(CASE WHEN cum_range -"
-        " cum_rows <>\n"
-        "   peer_sum - peer_prefix THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "   AS identity_viol FROM cm)",
-        # corollaries: equality exactly on last-of-group rows
-        # with positive later weight otherwise; unique keys
-        # never differ
-        "c2 AS (SELECT\n"
-        "   CAST(sum(CASE WHEN peer_prefix = peer_sum AND\n"
-        "     cum_range <> cum_rows THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "     AS lastpeer_viol,\n"
-        "   CAST(sum(CASE WHEN peer_n = 1 AND cum_range <>"
-        " cum_rows\n"
-        "     THEN 1 ELSE 0 END) AS BIGINT) AS unique_viol,\n"
-        "   CAST(sum(CASE WHEN cum_range <> cum_rows THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) AS n_differ,\n"
-        "   CAST(sum(CASE WHEN peer_n > 1 THEN 1 ELSE 0 END)"
-        " AS BIGINT)\n"
-        "     AS n_peer_rows,\n"
-        "   CAST(count(*) AS BIGINT) AS n FROM cm)",
-    ]
-    fin = (
-        "SELECT k.identity_viol, c.lastpeer_viol,\n"
-        "  c.unique_viol, c.n_differ, c.n_peer_rows, c.n\n"
-        "FROM ck k CROSS JOIN c2 c")
-    return parts, fin
-
-
-def _q781_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q781_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           .replace("{es}", "CAST(floor(epoch(ts)) AS BIGINT)")
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q781_range_vs_rows_frames",
-       "WITH " + _q781_join("documents", "//", " MATERIALIZED"))
-def q781(spark, sf_dir):
-    """RANGE vs ROWS window frames — the silent production bug
-    (a cumulative sum ordered by a NON-UNIQUE key gives
-    peer-group totals under RANGE and running totals under
-    ROWS, and dashboards built on the wrong one drift) pinned
-    down as an exact identity on real data.  Ordering 3000
-    events by their epoch MINUTE (deliberately non-unique),
-    both cumulative sums run side by side, and the difference
-    is certified to equal an INDEPENDENTLY computed quantity:
-    cum_range - cum_rows == (weight of later peers in the
-    same minute), row for row (identity_viol == 0) — because
-    a RANGE frame extends through the current row's PEERS.
-    Corollaries certified: the two agree exactly on
-    last-of-group rows, and rows whose key is unique never
-    differ — with the census emitted (n_differ rows of n,
-    against n_peer_rows rows living in multi-row minutes).
-    Both engines implement the standard identically here;
-    this query is the regression net that keeps it that way.
-    Scale: three windows over one sort — the certificate
-    costs what the bug costs."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
-        "events")
-    parts, fin = _q781_sql("events", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            .replace("{es}", "CAST(unix_timestamp(ts) AS"
-                     " BIGINT)")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q782: l-diversity — k-anonymity passing while the homogeneity
-# attack succeeds, and the generalization that fixes it
-
-
-def _q782_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # microdata: quasi-identifiers (age band, region) +
-        # a sensitive class; region 7's fine-grained groups are
-        # PLANTED homogeneous (same sensitive value per group)
-        f"md AS{{mat}} (SELECT CAST(doc_id AS BIGINT) AS rid,\n"
-        f"   CAST((doc_id * 13) % 8 AS BIGINT) AS age,\n"
-        f"   CAST(doc_id % 10 AS BIGINT) AS region,\n"
-        f"   CASE WHEN doc_id % 10 = 7 THEN ((doc_id * 13) %"
-        f" 8) % 5\n"
-        f"        ELSE ((doc_id {{d}} 40) * 3) % 5 END AS"
-        f" sens\n"
-        f"  FROM {tbl} WHERE doc_id < 400)",
-        # level 0: QI = (age, region); level 1: age coarsened
-        # to {d} 4 bands
-        "g0 AS (SELECT age AS q1, region AS q2,\n"
-        "   CAST(count(*) AS BIGINT) AS k,\n"
-        "   CAST(count(DISTINCT sens) AS BIGINT) AS l\n"
-        "  FROM md GROUP BY age, region)",
-        "g1 AS (SELECT age {d} 4 AS q1, region AS q2,\n"
-        "   CAST(count(*) AS BIGINT) AS k,\n"
-        "   CAST(count(DISTINCT sens) AS BIGINT) AS l\n"
-        "  FROM md GROUP BY age {d} 4, region)",
-        "c0 AS (SELECT\n"
-        "   CAST(min(k) AS BIGINT) AS k_min,\n"
-        "   CAST(min(l) AS BIGINT) AS l_min,\n"
-        "   CAST(sum(CASE WHEN l = 1 THEN k ELSE 0 END) AS"
-        " BIGINT)\n"
-        "     AS exposed_rows,\n"
-        "   CAST(sum(CASE WHEN l = 1 THEN 1 ELSE 0 END) AS"
-        " BIGINT)\n"
-        "     AS homogeneous_groups,\n"
-        "   CAST(count(*) AS BIGINT) AS n_groups FROM g0)",
-        "c1 AS (SELECT\n"
-        "   CAST(min(k) AS BIGINT) AS k_min,\n"
-        "   CAST(min(l) AS BIGINT) AS l_min,\n"
-        "   CAST(sum(CASE WHEN l = 1 THEN k ELSE 0 END) AS"
-        " BIGINT)\n"
-        "     AS exposed_rows,\n"
-        "   CAST(count(*) AS BIGINT) AS n_groups FROM g1)",
-        # the attack census: exposed rows are those whose
-        # sensitive value an adversary learns WITHOUT linking
-        # — exactly the rows of l = 1 groups
-        "at2 AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " attack_viol FROM\n"
-        "  (SELECT m.rid FROM md m JOIN g0 g ON g.q1 = m.age"
-        " AND g.q2 = m.region\n"
-        "   WHERE g.l = 1) a\n"
-        "  FULL OUTER JOIN\n"
-        "  (SELECT m.rid FROM md m JOIN g0 g ON g.q1 = m.age"
-        " AND g.q2 = m.region\n"
-        "   JOIN (SELECT age, region FROM md GROUP BY age,"
-        " region, sens)\n"
-        "     z ON z.age = m.age AND z.region = m.region\n"
-        "   GROUP BY m.rid HAVING count(*) ="
-        " (SELECT 1)) b\n"
-        "   ON b.rid = a.rid\n"
-        "  WHERE a.rid IS NULL OR b.rid IS NULL)",
-    ]
-    fin = (
-        "SELECT a.k_min AS k0, a.l_min AS l0,\n"
-        "  a.homogeneous_groups, a.exposed_rows AS exposed0,\n"
-        "  a.n_groups AS groups0,\n"
-        "  b.k_min AS k1, b.l_min AS l1,\n"
-        "  b.exposed_rows AS exposed1, b.n_groups AS"
-        " groups1,\n"
-        "  t.attack_viol\n"
-        "FROM c0 a CROSS JOIN c1 b CROSS JOIN at2 t")
-    return parts, fin
-
-
-def _q782_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q782_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q782_l_diversity",
-       "WITH " + _q782_join("documents", "//", " MATERIALIZED"))
-def q782(spark, sf_dir):
-    """l-diversity (Machanavajjhala et al. 2006): k-anonymity
-    is NOT privacy — the homogeneity attack computed, then
-    fixed, on planted microdata (the release-gate shape for
-    any user-level corpus statistic; q386/q594's k-anonymity
-    machinery completed with the attack it misses).  400 rows
-    with quasi-identifiers (age band, region) and a sensitive
-    class; region 7's groups are planted HOMOGENEOUS — every
-    member shares one sensitive value, so the release is
-    k-anonymous (k_min >= 5: no group is small) yet an
-    adversary who only knows someone's QI learns their
-    sensitive value outright: exposed0 counts the victims,
-    and the independent two-route census agrees row-for-row
-    (attack_viol == 0).  Coarsening age one level (the
-    generalization lattice step) merges the homogeneous
-    groups with mixed neighbors: l_min rises above 1 and
-    exposed1 == 0 — the l-diversity fix, paid for in
-    granularity (groups1 < groups0).  Scale: group censuses
-    are one aggregation per lattice level — the audit runs
-    before every release."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q782_documents")
-    parts, fin = _q782_sql("q782_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q783: Kish effective sample size — Cauchy-Schwarz as data,
-# with the design-effect ledger on real weights
-
-
-def _q783_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # three weighting schemes over 400 docs: uniform,
-        # mildly skewed (real n_chars), and concentrated
-        f"wt AS{{mat}} (SELECT CAST(doc_id AS BIGINT) AS i,\n"
-        f"   CAST(s.s AS BIGINT) AS scheme,\n"
-        f"   CASE s.s WHEN 0 THEN CAST(7 AS BIGINT)\n"
-        f"        WHEN 1 THEN CAST(n_chars AS BIGINT)\n"
-        f"        ELSE CASE WHEN doc_id < 4 THEN CAST(1000 AS"
-        f" BIGINT)\n"
-        f"          ELSE CAST(1 AS BIGINT) END END AS w\n"
-        f"  FROM {tbl} CROSS JOIN (VALUES (0), (1), (2))"
-        f" s(s)\n"
-        f"  WHERE doc_id < 400)",
-        # ESS = (sum w)^2 / sum w^2, kept as an exact integer
-        # pair; Cauchy-Schwarz says ESS <= n with equality iff
-        # the weights are constant
-        "es AS (SELECT scheme,\n"
-        "   CAST(sum(w) * sum(w) AS BIGINT) AS ess_num,\n"
-        "   CAST(sum(w * w) AS BIGINT) AS ess_den,\n"
-        "   CAST(count(*) AS BIGINT) AS n,\n"
-        "   CAST(count(DISTINCT w) AS BIGINT) AS ndw\n"
-        "  FROM wt GROUP BY scheme)",
-        "ck AS (SELECT scheme, ess_num, ess_den, n, ndw,\n"
-        "   CASE WHEN ess_num <= n * ess_den THEN 1 ELSE 0"
-        " END AS cs_ok,\n"
-        "   CASE WHEN ess_num = n * ess_den THEN 1 ELSE 0 END"
-        " AS equality,\n"
-        "   ess_num {d} ess_den AS ess_floor\n"
-        "  FROM es)",
-        # the iff: equality exactly when one distinct weight
-        "iv AS (SELECT CAST(sum(CASE WHEN (equality = 1) <>\n"
-        "   (ndw = 1) THEN 1 ELSE 0 END) AS BIGINT) AS"
-        " iff_viol FROM ck)",
-    ]
-    fin = (
-        "SELECT c.scheme, c.n, c.ess_num, c.ess_den,\n"
-        "  c.ess_floor, c.cs_ok, c.equality, c.ndw,\n"
-        "  v.iff_viol\n"
-        "FROM ck c CROSS JOIN iv v")
-    return parts, fin
-
-
-def _q783_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q783_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q783_kish_ess",
-       "WITH " + _q783_join("documents", "//", " MATERIALIZED"))
-def q783(spark, sf_dir):
-    """Kish's effective sample size (Kish 1965 — ESS =
-    (sum w)^2 / sum w^2, the number every weighted-sampling
-    pipeline must report beside its row count, because a
-    million rows under concentrated weights can carry the
-    information of four) with CAUCHY-SCHWARZ CERTIFIED AS
-    DATA.  Three weighting schemes over the same 400
-    documents: uniform, the real n_chars distribution, and a
-    4-whales-dominate scheme.  ESS is kept as an exact
-    integer pair (no division until the floored quotient);
-    the inequality ESS <= n holds for every scheme (cs_ok ==
-    1 — Cauchy-Schwarz applied to (w, 1)), and the EQUALITY
-    CASE is certified as a genuine iff: equality holds
-    exactly when the scheme has one distinct weight (iff_viol
-    == 0).  The ledger tells the story: uniform ESS = 400,
-    the real-length weights lose modestly, the whale scheme
-    collapses to single digits — the design-effect warning a
-    corpus datasheet (q348) should carry.  Scale: two
-    map-side sums per scheme."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q783_documents")
-    parts, fin = _q783_sql("q783_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
 
 
 # ---------------------------------------------------------------------------
@@ -70944,7 +12079,7 @@ def _q784_join(tbl: str, d: str, mat: str) -> str:
 
 
 @query("q784_pip_degeneracies",
-       "WITH " + _q784_join("documents", "//", " MATERIALIZED"))
+       "WITH " + _q784_join("documents", "//", " MATERIALIZED"), kind="operator")
 def q784(spark, sf_dir):
     """Point-in-polygon DEGENERACY census — the shipped PIP
     kernel (kernels/pip.py, the core of q11/q12's spatial
@@ -70997,1290 +12132,6 @@ def q784(spark, sf_dir):
     fin_e = re.sub(r"\bkr k\b", "q784_kr k", fin)
     return spark.sql("WITH " + ",\n       ".join(kept)
                      + "\n" + fin_e)
-
-
-# ---------------------------------------------------------------------------
-# q785: LWW-map semilattice axioms — commutative, associative,
-# idempotent, order-free convergence, all as joins
-
-
-def _q785_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # three replica states over 30 keys: overlapping
-        # writes with distinct (ts, origin) tie-breaks
-        f"st AS{{mat}} (SELECT CAST(doc_id % 3 AS BIGINT) AS"
-        f" rep,\n"
-        f"   CAST(doc_id % 30 AS BIGINT) AS k,\n"
-        f"   CAST((doc_id * 17) % 50 AS BIGINT) * 100 +"
-        f" doc_id % 3 AS tk,\n"
-        f"   CAST(doc_id AS BIGINT) AS val\n"
-        f"  FROM {tbl} WHERE doc_id < 90)",
-        "mab AS (SELECT k, CAST(max_by(val, tk) AS BIGINT) AS"
-        " val\n"
-        "  FROM st WHERE rep <= 1 GROUP BY k)",
-        "mba AS (SELECT k, CAST(max_by(val, tk) AS BIGINT) AS"
-        " val\n"
-        "  FROM (SELECT * FROM st WHERE rep = 1\n"
-        "    UNION ALL SELECT * FROM st WHERE rep = 0) z\n"
-        "  GROUP BY k)",
-        "cm AS (SELECT CAST(count(*) AS BIGINT) AS comm_viol\n"
-        "  FROM mab a FULL OUTER JOIN mba b ON b.k = a.k AND"
-        " b.val = a.val\n"
-        "  WHERE a.k IS NULL OR b.k IS NULL)",
-        # associativity through the max_by carrier: rebuild
-        # with tk retained
-        "m01 AS (SELECT k, CAST(max(tk) AS BIGINT) AS tk,\n"
-        "   CAST(max_by(val, tk) AS BIGINT) AS val\n"
-        "  FROM st WHERE rep <= 1 GROUP BY k)",
-        "m12 AS (SELECT k, CAST(max(tk) AS BIGINT) AS tk,\n"
-        "   CAST(max_by(val, tk) AS BIGINT) AS val\n"
-        "  FROM st WHERE rep >= 1 GROUP BY k)",
-        "ma AS (SELECT k, CAST(max_by(val, tk) AS BIGINT) AS"
-        " val FROM\n"
-        "  (SELECT k, tk, val FROM m01 UNION ALL\n"
-        "   SELECT k, tk, val FROM st WHERE rep = 2) z GROUP"
-        " BY k)",
-        "mb AS (SELECT k, CAST(max_by(val, tk) AS BIGINT) AS"
-        " val FROM\n"
-        "  (SELECT k, tk, val FROM m12 UNION ALL\n"
-        "   SELECT k, tk, val FROM st WHERE rep = 0) z GROUP"
-        " BY k)",
-        "av AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " assoc_viol\n"
-        "  FROM ma a FULL OUTER JOIN mb b ON b.k = a.k AND"
-        " b.val = a.val\n"
-        "  WHERE a.k IS NULL OR b.k IS NULL)",
-        # idempotence: merging a state with itself changes
-        # nothing
-        "mi AS (SELECT k, CAST(max_by(val, tk) AS BIGINT) AS"
-        " val FROM\n"
-        "  (SELECT * FROM st WHERE rep = 0 UNION ALL\n"
-        "   SELECT * FROM st WHERE rep = 0) z GROUP BY k)",
-        "s0 AS (SELECT k, CAST(max_by(val, tk) AS BIGINT) AS"
-        " val\n"
-        "  FROM st WHERE rep = 0 GROUP BY k)",
-        "iv AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " idem_viol\n"
-        "  FROM mi a FULL OUTER JOIN s0 b ON b.k = a.k AND"
-        " b.val = a.val\n"
-        "  WHERE a.k IS NULL OR b.k IS NULL)",
-        "fl AS (SELECT k, CAST(max_by(val, tk) AS BIGINT) AS"
-        " val\n"
-        "  FROM st GROUP BY k)",
-        "cv AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " conv_viol\n"
-        "  FROM ma a FULL OUTER JOIN fl b ON b.k = a.k AND"
-        " b.val = a.val\n"
-        "  WHERE a.k IS NULL OR b.k IS NULL)",
-    ]
-    fin = (
-        "SELECT f.k, f.val AS converged_val,\n"
-        "  c.comm_viol, a.assoc_viol, i.idem_viol,\n"
-        "  v.conv_viol\n"
-        "FROM fl f CROSS JOIN cm c CROSS JOIN av a\n"
-        "CROSS JOIN iv i CROSS JOIN cv v\n"
-        "WHERE f.k < 8")
-    return parts, fin
-
-
-def _q785_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q785_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q785_lww_semilattice",
-       "WITH " + _q785_join("documents", "//", " MATERIALIZED"))
-def q785(spark, sf_dir):
-    """The last-writer-wins map's SEMILATTICE axioms — the
-    three algebraic facts (commutative, associative,
-    idempotent) that make a state-based CRDT converge without
-    coordination (Shapiro et al. 2011; the metadata-merge
-    discipline behind multi-writer manifests and q582's
-    OR-set) — each certified as a FULL OUTER JOIN census over
-    three replica states with overlapping writes and strict
-    (timestamp, origin) tie-breaking.  merge(A,B) ==
-    merge(B,A) key-for-key (comm_viol == 0); ((A+B)+C) ==
-    (A+(B+C)) with the max-timestamp carrier retained through
-    the intermediate merge — retaining the carrier is what
-    MAKES the composition associative (assoc_viol == 0);
-    merge(A,A) == A (idem_viol == 0); and every merge order
-    equals the flat all-replicas merge (conv_viol == 0) —
-    strong eventual consistency computed, not assumed.
-    Scale: merge is max_by per key — map-side combinable; the
-    axioms are exactly why it can be."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q785_documents")
-    parts, fin = _q785_sql("q785_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q786: consistent snapshots — cut closure under direct
-# happens-before edges, Chandy-Lamport vs the wall-clock cut
-
-
-_Q786_EV = ",\n   ".join([
-    # (eid, proc, seq, kind, partner): kind 0 internal,
-    # 1 send, 2 recv; partner = matching send eid for a recv
-    "(1, 0, 1, 0, -1)", "(2, 0, 2, 1, -1)", "(3, 1, 1, 0, -1)",
-    "(4, 1, 2, 2, 2)", "(5, 2, 1, 1, -1)", "(6, 1, 3, 1, -1)",
-    "(7, 0, 3, 2, 5)", "(8, 2, 2, 2, 6)", "(9, 0, 4, 1, -1)",
-    "(10, 2, 3, 0, -1)", "(11, 2, 4, 2, 9)",
-    "(12, 1, 4, 0, -1)", "(13, 0, 5, 0, -1)",
-    "(14, 1, 5, 1, -1)", "(15, 0, 6, 2, 14)",
-    "(16, 2, 5, 0, -1)"])
-
-
-def _q786_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "ev AS (SELECT * FROM (VALUES\n   " + _Q786_EV
-        + ") t(eid, proc, seq, kind, partner))",
-        # two cuts as per-process frontiers: cut 0 is
-        # Chandy-Lamport-consistent; cut 1 is the naive
-        # wall-clock cut eid <= 8 per process
-        "ct AS (SELECT * FROM (VALUES (0, 0, 4), (0, 1, 3),\n"
-        "   (0, 2, 2), (1, 0, 3), (1, 1, 2), (1, 2, 3))\n"
-        "  t(cut, proc, upto))",
-        "mem AS{mat} (SELECT c.cut, e.eid, e.proc, e.seq,\n"
-        "   e.kind, e.partner,\n"
-        "   CASE WHEN e.seq <= c.upto THEN 1 ELSE 0 END AS"
-        " inc\n"
-        "  FROM ev e JOIN ct c ON c.proc = e.proc)",
-        # direct happens-before predecessors: program-order
-        # previous event, and the matching send of a recv;
-        # a cut is consistent iff closed under BOTH
-        "pv AS (SELECT m.cut,\n"
-        "   CAST(sum(CASE WHEN m.inc = 1 AND p.inc = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) AS po_viol\n"
-        "  FROM mem m JOIN mem p ON p.cut = m.cut AND p.proc"
-        " = m.proc\n"
-        "   AND p.seq = m.seq - 1 GROUP BY m.cut)",
-        "sv AS (SELECT m.cut,\n"
-        "   CAST(sum(CASE WHEN m.inc = 1 AND s.inc = 0 THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) AS orphan_recv\n"
-        "  FROM mem m JOIN mem s ON s.cut = m.cut AND s.eid ="
-        " m.partner\n"
-        "  WHERE m.kind = 2 GROUP BY m.cut)",
-        # channel state the snapshot must record: sends inside
-        # the cut whose receive is outside
-        "ch AS (SELECT m.cut,\n"
-        "   CAST(sum(CASE WHEN m.inc = 0 AND s.inc = 1 THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) AS in_flight\n"
-        "  FROM mem m JOIN mem s ON s.cut = m.cut AND s.eid ="
-        " m.partner\n"
-        "  WHERE m.kind = 2 GROUP BY m.cut)",
-        "vd AS (SELECT p.cut,\n"
-        "   CASE WHEN p.po_viol = 0 AND s.orphan_recv = 0"
-        " THEN 1\n"
-        "        ELSE 0 END AS consistent,\n"
-        "   p.po_viol, s.orphan_recv, c.in_flight\n"
-        "  FROM pv p JOIN sv s ON s.cut = p.cut\n"
-        "  JOIN ch c ON c.cut = p.cut)",
-    ]
-    fin = (
-        "SELECT v.cut, v.consistent, v.po_viol,\n"
-        "  v.orphan_recv, v.in_flight,\n"
-        "  (SELECT CAST(sum(inc) AS BIGINT) FROM mem m WHERE"
-        " m.cut = v.cut)\n"
-        "    AS cut_size\n"
-        "FROM vd v")
-    return parts, fin
-
-
-def _q786_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q786_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q786_consistent_cuts",
-       "WITH " + _q786_join("documents", "//", " MATERIALIZED"))
-def q786(spark, sf_dir):
-    """Consistent global snapshots (Chandy-Lamport 1985 — the
-    algorithm behind every exactly-once checkpoint barrier,
-    Flink's included, and the resume semantics this engine's
-    manifest story assumes) decided by the CLOSURE criterion:
-    a cut is consistent iff closed under the DIRECT
-    happens-before edges — program-order predecessor and
-    matching send of every included receive — which by
-    induction is closure under all of Lamport's
-    happens-before, no transitive closure needed.  A 16-event
-    3-process execution with two cuts: the marker-aligned cut
-    passes (consistent == 1: zero program-order violations,
-    zero orphan receives) and its CHANNEL STATE — sends
-    inside whose receives are outside, exactly what C-L
-    records on the channel — is emitted; the naive aligned-
-    frontier cut includes a receive whose send lies outside
-    (orphan_recv > 0): the cut observed a message that was
-    never sent, the anomaly the marker algorithm exists to
-    prevent.  Scale: cut auditing is two self-joins over the
-    event log — runs on real checkpoint logs as-is."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q786_documents")
-    parts, fin = _q786_sql("q786_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q787: exact Bloom false-positive rate over a complete
-# pairwise-independent family — the textbook formula's true error
-
-
-def _q787_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 6 member keys (distinct residues), universe mod 17,
-        # m = 8 bits; the COMPLETE affine family h_{a,b}(x) =
-        # ((a x + b) mod 17) mod 8, a in 1..16, b in 0..16
-        f"ky AS (SELECT DISTINCT CAST((doc_id * 5) % 17 AS"
-        f" BIGINT) AS x\n"
-        f"  FROM {tbl} WHERE doc_id < 6)",
-        f"fa AS (SELECT CAST(doc_id + 1 AS BIGINT) AS a"
-        f" FROM {tbl} WHERE doc_id < 16)",
-        f"fb AS (SELECT CAST(doc_id AS BIGINT) AS b"
-        f" FROM {tbl} WHERE doc_id < 17)",
-        "fm AS (SELECT a.a, b.b FROM fa a CROSS JOIN fb b)",
-        # bits set per family member
-        "bt AS{mat} (SELECT f.a, f.b,\n"
-        "   ((f.a * k.x + f.b) % 17) % 8 AS bit\n"
-        "  FROM fm f CROSS JOIN ky k)",
-        "nb AS (SELECT a, b, CAST(count(DISTINCT bit) AS"
-        " BIGINT) AS set_bits\n"
-        "  FROM bt GROUP BY a, b)",
-        # probes: three non-member values
-        "pr AS (SELECT CAST(x AS BIGINT) AS q FROM (VALUES"
-        " (1), (6), (16)) t(x))",
-        "nm AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " member_probe\n"
-        "  FROM pr p JOIN ky k ON k.x = p.q)",
-        # exact FP census: probe's bit set although the probe
-        # is not a member
-        "fp AS (SELECT p.q,\n"
-        "   CAST(sum(CASE WHEN EXISTS (SELECT 1 FROM bt t\n"
-        "     WHERE t.a = f.a AND t.b = f.b\n"
-        "      AND t.bit = ((f.a * p.q + f.b) % 17) % 8)\n"
-        "    THEN 1 ELSE 0 END) AS BIGINT) AS fp_count,\n"
-        "   CAST(count(*) AS BIGINT) AS fam\n"
-        "  FROM pr p CROSS JOIN fm f GROUP BY p.q)",
-        # the idealized formula 1 - (7/8)^6 as the exact
-        # rational 1 - 117649/262144; compare cross-multiplied
-        "cm AS (SELECT q, fp_count, fam,\n"
-        "   fp_count * 262144 AS census_scaled,\n"
-        "   fam * (262144 - 117649) AS formula_scaled,\n"
-        "   fp_count * 262144 - fam * (262144 - 117649) AS"
-        " gap_scaled\n"
-        "  FROM fp)",
-        "ab AS (SELECT CAST(min(set_bits) AS BIGINT) AS"
-        " min_bits,\n"
-        "   CAST(max(set_bits) AS BIGINT) AS max_bits,\n"
-        "   CAST(sum(set_bits) AS BIGINT) AS tot_bits,\n"
-        "   CAST(count(*) AS BIGINT) AS fam FROM nb)",
-    ]
-    fin = (
-        "SELECT c.q, c.fp_count, c.fam, c.census_scaled,\n"
-        "  c.formula_scaled, c.gap_scaled,\n"
-        "  CASE WHEN c.gap_scaled <> 0 THEN 1 ELSE 0 END AS"
-        " formula_inexact,\n"
-        "  a.min_bits, a.max_bits, a.tot_bits,\n"
-        "  n.member_probe\n"
-        "FROM cm c CROSS JOIN ab a CROSS JOIN nm n")
-    return parts, fin
-
-
-def _q787_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q787_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q787_bloom_exact_fpp",
-       "WITH " + _q787_join("documents", "//", " MATERIALIZED"))
-def q787(spark, sf_dir):
-    """The Bloom filter false-positive 'formula' is an
-    APPROXIMATION — and here is its exact error for a real
-    hash family, computed by complete exhaustion (the q772
-    derandomization program applied to the q586/q756 Bloom
-    machinery).  Six member keys, an 8-bit filter, and the
-    ENTIRE pairwise-independent affine family h(x) = ((ax+b)
-    mod 17) mod 8 (272 functions — every one evaluated, no
-    sampling): for each of three non-member probes the exact
-    false-positive count over the family is compared
-    cross-multiplied against the textbook 1 - (1 - 1/m)^n =
-    1 - (7/8)^6, and the gap is NONZERO (formula_inexact ==
-    1) — the formula assumes full independence and uniform
-    bits, neither of which an implementable family provides;
-    per-probe rates even differ from each other, because
-    affine structure makes some probes collide more.  The
-    set-bits distribution (min/max/total over the family)
-    shows the non-uniformity's source.  Scale: the census is
-    family x keys rows; real deployments sample where this
-    query exhausts — knowing the formula's bias is what the
-    exhaustion buys."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q787_documents")
-    parts, fin = _q787_sql("q787_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q788: MVT coordinate quantization — error bound, order
-# preservation, idempotence, and the snapping collision ledger
-
-
-def _q788_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # world coordinates in integer micro-units; tiles of
-        # W = 2^20 units, quantized to extent 4096 (step 256)
-        f"pt AS{{mat}} (SELECT CAST(doc_id AS BIGINT) AS pid,\n"
-        f"   (CAST(doc_id AS BIGINT) * 9973) % 4194304 AS x,\n"
-        f"   (CAST(doc_id AS BIGINT) * 7919) % 4194304 AS y\n"
-        f"  FROM {tbl} WHERE doc_id < 500)",
-        "qz AS{mat} (SELECT pid, x, y,\n"
-        "   x {d} 1048576 AS tx, y {d} 1048576 AS ty,\n"
-        "   (x % 1048576) {d} 256 AS qx,\n"
-        "   (y % 1048576) {d} 256 AS qy\n"
-        "  FROM pt)",
-        # decode to cell centers; error bounded by half a step
-        "dc AS (SELECT pid, x, y, tx, ty, qx, qy,\n"
-        "   tx * 1048576 + qx * 256 + 128 AS xd,\n"
-        "   ty * 1048576 + qy * 256 + 128 AS yd\n"
-        "  FROM qz)",
-        "eb AS (SELECT\n"
-        "   CAST(max(abs(xd - x)) AS BIGINT) AS max_err_x,\n"
-        "   CAST(max(abs(yd - y)) AS BIGINT) AS max_err_y,\n"
-        "   CAST(sum(CASE WHEN abs(xd - x) > 128 OR abs(yd -"
-        " y) > 128\n"
-        "     THEN 1 ELSE 0 END) AS BIGINT) AS bound_viol\n"
-        "  FROM dc)",
-        # order preservation within a tile column
-        "op AS (SELECT CAST(sum(CASE WHEN a.x <= b.x AND a.qx"
-        " > b.qx\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS order_viol\n"
-        "  FROM qz a JOIN qz b ON b.tx = a.tx AND b.pid <>"
-        " a.pid)",
-        # idempotence: re-quantizing the decoded center lands
-        # on the same cell
-        "iq AS (SELECT CAST(sum(CASE WHEN\n"
-        "   (xd % 1048576) {d} 256 <> qx OR\n"
-        "   (yd % 1048576) {d} 256 <> qy\n"
-        "   THEN 1 ELSE 0 END) AS BIGINT) AS idem_viol FROM"
-        " dc)",
-        # the snapping ledger: distinct quantized positions
-        # per tile vs raw points — what 4096-extent encoding
-        # merges
-        "sn AS (SELECT tx, ty,\n"
-        "   CAST(count(*) AS BIGINT) AS n_points,\n"
-        "   CAST(count(DISTINCT qx * 4096 + qy) AS BIGINT) AS"
-        " n_positions\n"
-        "  FROM qz GROUP BY tx, ty)",
-        "sg AS (SELECT CAST(sum(n_points) AS BIGINT) AS"
-        " tot_points,\n"
-        "   CAST(sum(n_positions) AS BIGINT) AS"
-        " tot_positions,\n"
-        "   CAST(count(*) AS BIGINT) AS n_tiles FROM sn)",
-    ]
-    fin = (
-        "SELECT e.max_err_x, e.max_err_y, e.bound_viol,\n"
-        "  o.order_viol, i.idem_viol,\n"
-        "  s.tot_points, s.tot_positions, s.n_tiles,\n"
-        "  s.tot_points - s.tot_positions AS snapped_away\n"
-        "FROM eb e CROSS JOIN op o CROSS JOIN iq i\n"
-        "CROSS JOIN sg s")
-    return parts, fin
-
-
-def _q788_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q788_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q788_mvt_quantization",
-       "WITH " + _q788_join("documents", "//", " MATERIALIZED"))
-def q788(spark, sf_dir):
-    """MVT coordinate quantization (the 4096-extent tile-local
-    integer grid every q210/q270/q482 vector tile snaps to)
-    with its four contracts certified in exact integers: the
-    ERROR BOUND — decoding to cell centers never strays more
-    than half a quantization step (max |err| <= 128
-    micro-units, bound_viol == 0, and max_err hits exactly
-    the bound: the worst case is realized, not just bounded);
-    ORDER PRESERVATION — quantization is monotone within a
-    tile (order_viol == 0), so ring orientation and
-    coordinate sorting survive encoding; IDEMPOTENCE —
-    re-quantizing a decoded center returns the same cell
-    (idem_viol == 0), the property that makes tiles safely
-    re-encodable; and the SNAPPING LEDGER — distinct
-    positions vs raw points per tile, counting exactly how
-    many vertices a 4096 grid merges (the lossy part,
-    quantified rather than ignored).  Scale: pure Column
-    arithmetic; the ledger is one groupBy per tile — the
-    same accounting a tile pipeline should emit per zoom."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q788_documents")
-    parts, fin = _q788_sql("q788_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q789: geohash neighbors — grid adjacency vs string prefixes,
-# with the z-order seam witnessed
-
-
-def _q789_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 10-bit lon/lat grids (4-char geohash); occupied cells
-        # from the integer point derivation
-        f"pt AS (SELECT CAST(doc_id AS BIGINT) AS pid,\n"
-        f"   CASE WHEN doc_id % 2 = 0 THEN 504 +"
-        f" (CAST(doc_id AS BIGINT) {{d}} 2 * 3) % 16\n"
-        f"        ELSE 200 + (CAST(doc_id AS BIGINT) {{d}} 2 *"
-        f" 5) % 12 END AS gx,\n"
-        f"   CASE WHEN doc_id % 2 = 0 THEN 506 +"
-        f" (CAST(doc_id AS BIGINT) {{d}} 2 * 7) % 12\n"
-        f"        ELSE 700 + (CAST(doc_id AS BIGINT) {{d}} 2 *"
-        f" 11) % 10 END AS gy\n"
-        f"  FROM {tbl} WHERE doc_id < 400)",
-        "cl AS{mat} (SELECT DISTINCT gx, gy FROM pt)",
-        # 20-bit lon-first interleave -> 4 base-32 chars
-        "gh AS{mat} (SELECT gx, gy,\n"
-        "   ((gx {d} 512) % 2) * 524288 + ((gy {d} 512) % 2)"
-        " * 262144\n"
-        "   + ((gx {d} 256) % 2) * 131072 + ((gy {d} 256) %"
-        " 2) * 65536\n"
-        "   + ((gx {d} 128) % 2) * 32768 + ((gy {d} 128) % 2)"
-        " * 16384\n"
-        "   + ((gx {d} 64) % 2) * 8192 + ((gy {d} 64) % 2) *"
-        " 4096\n"
-        "   + ((gx {d} 32) % 2) * 2048 + ((gy {d} 32) % 2) *"
-        " 1024\n"
-        "   + ((gx {d} 16) % 2) * 512 + ((gy {d} 16) % 2) *"
-        " 256\n"
-        "   + ((gx {d} 8) % 2) * 128 + ((gy {d} 8) % 2) * 64\n"
-        "   + ((gx {d} 4) % 2) * 32 + ((gy {d} 4) % 2) * 16\n"
-        "   + ((gx {d} 2) % 2) * 8 + ((gy {d} 2) % 2) * 4\n"
-        "   + (gx % 2) * 2 + (gy % 2) AS code\n"
-        "  FROM cl)",
-        "hs AS{mat} (SELECT gx, gy, code,\n"
-        "   substr('0123456789bcdefghjkmnpqrstuvwxyz',\n"
-        "     CAST(code {d} 32768 + 1 AS INT), 1) ||\n"
-        "   substr('0123456789bcdefghjkmnpqrstuvwxyz',\n"
-        "     CAST((code {d} 1024) % 32 + 1 AS INT), 1) ||\n"
-        "   substr('0123456789bcdefghjkmnpqrstuvwxyz',\n"
-        "     CAST((code {d} 32) % 32 + 1 AS INT), 1) ||\n"
-        "   substr('0123456789bcdefghjkmnpqrstuvwxyz',\n"
-        "     CAST(code % 32 + 1 AS INT), 1) AS h\n"
-        "  FROM gh)",
-        # adjacent occupied cell pairs (8-neighborhood)
-        "aj AS (SELECT a.gx AS ax, a.gy AS ay, b.gx AS bx,\n"
-        "   b.gy AS by2, a.h AS ha, b.h AS hb,\n"
-        "   CASE WHEN substr(a.h, 1, 3) = substr(b.h, 1, 3)"
-        " THEN 3\n"
-        "        WHEN substr(a.h, 1, 2) = substr(b.h, 1, 2)"
-        " THEN 2\n"
-        "        WHEN substr(a.h, 1, 1) = substr(b.h, 1, 1)"
-        " THEN 1\n"
-        "        ELSE 0 END AS common_prefix\n"
-        "  FROM hs a JOIN hs b ON abs(b.gx - a.gx) <= 1\n"
-        "   AND abs(b.gy - a.gy) <= 1\n"
-        "   AND (b.gx <> a.gx OR b.gy <> a.gy)\n"
-        "   AND (b.gx > a.gx OR (b.gx = a.gx AND b.gy >"
-        " a.gy)))",
-        "hg AS (SELECT common_prefix, CAST(count(*) AS"
-        " BIGINT) AS n\n"
-        "  FROM aj GROUP BY common_prefix)",
-        # the seam witness: adjacency with ZERO shared prefix
-        "sw AS (SELECT CAST(coalesce(sum(CASE WHEN"
-        " common_prefix = 0\n"
-        "   THEN 1 ELSE 0 END), 0) AS BIGINT) AS"
-        " seam_pairs,\n"
-        "   CAST(count(*) AS BIGINT) AS adj_pairs FROM aj)",
-        # code uniqueness: the interleave is injective on the
-        # occupied set
-        "uq AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM cl) -\n"
-        "   (SELECT CAST(count(DISTINCT code) AS BIGINT) FROM"
-        " gh) AS inj_viol)",
-    ]
-    fin = (
-        "SELECT g.common_prefix, g.n, s.seam_pairs,\n"
-        "  s.adj_pairs, u.inj_viol\n"
-        "FROM hg g CROSS JOIN sw s CROSS JOIN uq u")
-    return parts, fin
-
-
-def _q789_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q789_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q789_geohash_seams",
-       "WITH " + _q789_join("documents", "//", " MATERIALIZED"))
-def q789(spark, sf_dir):
-    """Geohash NEIGHBOR SEAMS — the trap under every
-    'prefix-match to find nearby things' shortcut (q402's
-    roundtrip completed with the adjacency story): two cells
-    that share an EDGE on the map can share NO prefix at all,
-    because the z-order interleave folds the plane.  Occupied
-    4-char cells form two dense patches — one deliberately
-    straddling the gx = gy = 512 top-bit fold, one interior; the
-    lon-first 20-bit interleave (injective on the occupied
-    set, inj_viol == 0) maps to base-32 strings; every
-    adjacent occupied pair (8-neighborhood in grid space) is
-    histogrammed by common-prefix length — most neighbors
-    share 3 characters, but the census exhibits seam_pairs >
-    0 adjacencies sharing ZERO characters (cells straddling a
-    major z-fold).  The operational lesson, as data: geohash
-    proximity joins must expand to the true 8-neighbor cells
-    (computed here by grid arithmetic — decode, offset,
-    re-encode), never by prefix matching; the engine's cell
-    joins (q16/q46) use exactly the neighbor-ring form.
-    Scale: the adjacency census is a bounded band join on
-    grid indices."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q789_documents")
-    parts, fin = _q789_sql("q789_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q790: Fagin's threshold algorithm — the stopping rule certified
-# safe and its conservatism measured, all depths at once
-
-
-def _q790_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 40 items, two score lists from independent key
-        # derivations (item's total = s1 + s2)
-        f"it AS{{mat}} (SELECT CAST(doc_id AS BIGINT) AS i,\n"
-        f"   (CAST(doc_id AS BIGINT) * 37) % 97 AS s1,\n"
-        f"   (CAST(doc_id AS BIGINT) * 61) % 89 AS s2\n"
-        f"  FROM {tbl} WHERE doc_id < 40)",
-        "r1 AS (SELECT i, s1, row_number() OVER (ORDER BY s1"
-        " DESC, i) AS d1 FROM it)",
-        "r2 AS (SELECT i, s2, row_number() OVER (ORDER BY s2"
-        " DESC, i) AS d2 FROM it)",
-        f"dp AS (SELECT CAST(doc_id + 1 AS BIGINT) AS dep"
-        f" FROM {tbl} WHERE doc_id < 40)",
-        # threshold at each depth: sum of the two lists'
-        # values AT that sorted position
-        "th AS{mat} (SELECT p.dep, a.s1 + b.s2 AS thr\n"
-        "  FROM dp p JOIN r1 a ON a.d1 = p.dep\n"
-        "  JOIN r2 b ON b.d2 = p.dep)",
-        # seen set at each depth (sorted access on either
-        # list + random access completes the score)
-        "sn AS{mat} (SELECT p.dep, t.i, t.s1 + t.s2 AS sc\n"
-        "  FROM dp p JOIN it t ON 1 = 1\n"
-        "  JOIN r1 a ON a.i = t.i JOIN r2 b ON b.i = t.i\n"
-        "  WHERE a.d1 <= p.dep OR b.d2 <= p.dep)",
-        # k-th best seen per depth (k = 5)
-        "kb AS (SELECT dep, CAST(min(sc) AS BIGINT) AS kth\n"
-        "  FROM (SELECT dep, sc, row_number() OVER (PARTITION"
-        " BY dep\n"
-        "    ORDER BY sc DESC, i) AS rk FROM sn) z\n"
-        "  WHERE rk <= 5 AND dep >= 3 GROUP BY dep\n"
-        "  HAVING count(*) = 5)",
-        # TA stops at the first depth where kth >= threshold
-        "sp AS (SELECT CAST(min(k.dep) AS BIGINT) AS"
-        " stop_depth\n"
-        "  FROM kb k JOIN th t ON t.dep = k.dep\n"
-        "  WHERE k.kth >= t.thr)",
-        # ground truth top-5
-        "gt AS (SELECT i, s1 + s2 AS sc FROM (SELECT i, s1,"
-        " s2,\n"
-        "   row_number() OVER (ORDER BY s1 + s2 DESC, i) AS"
-        " rk FROM it) z\n"
-        "  WHERE rk <= 5)",
-        # the safety certificate: top-5 of the seen set AT the
-        # stop depth equals the global top-5
-        "ta AS (SELECT s.i, s.sc FROM\n"
-        "  (SELECT n.i, n.sc, row_number() OVER (ORDER BY"
-        " n.sc DESC, n.i)\n"
-        "    AS rk FROM sn n JOIN sp ON n.dep ="
-        " sp.stop_depth) s(i, sc, rk)\n"
-        "  WHERE s.rk <= 5)",
-        "cv AS (SELECT CAST(count(*) AS BIGINT) AS ta_viol\n"
-        "  FROM ta a FULL OUTER JOIN gt b ON b.i = a.i AND"
-        " b.sc = a.sc\n"
-        "  WHERE a.i IS NULL OR b.i IS NULL)",
-        # conservatism: the earliest depth whose seen-top-5
-        # already equals the truth (TA cannot KNOW this)
-        "er AS (SELECT CAST(min(dep) AS BIGINT) AS"
-        " earliest_correct FROM\n"
-        "  (SELECT z.dep FROM\n"
-        "    (SELECT dep, i, sc, row_number() OVER (PARTITION"
-        " BY dep\n"
-        "      ORDER BY sc DESC, i) AS rk FROM sn) z\n"
-        "   JOIN gt g ON g.i = z.i AND g.sc = z.sc\n"
-        "   WHERE z.rk <= 5\n"
-        "   GROUP BY z.dep HAVING count(*) = 5) y)",
-    ]
-    fin = (
-        "SELECT g.i, g.sc, s.stop_depth, e.earliest_correct,\n"
-        "  s.stop_depth - e.earliest_correct AS"
-        " conservatism,\n"
-        "  c.ta_viol,\n"
-        "  (SELECT CAST(count(*) AS BIGINT) FROM sn n2 WHERE"
-        " n2.dep = s.stop_depth)\n"
-        "    AS items_touched\n"
-        "FROM gt g CROSS JOIN sp s CROSS JOIN er e\n"
-        "CROSS JOIN cv c")
-    return parts, fin
-
-
-def _q790_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q790_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q790_threshold_algorithm",
-       "WITH " + _q790_join("documents", "//", " MATERIALIZED"))
-def q790(spark, sf_dir):
-    """Fagin's Threshold Algorithm (Fagin-Lotem-Naor 2001 —
-    instance-optimal top-k over sorted score lists, the
-    middleware ancestor of every WAND/MaxScore pruning rule,
-    q298/q742's family patriarch) with the stopping rule
-    certified SAFE and its conservatism MEASURED, every depth
-    evaluated at once instead of sequentially.  Two score
-    lists over 40 items; at each sorted-access depth the
-    threshold is the sum of the lists' values at that
-    position — no unseen item can beat it — and TA stops when
-    the 5th-best fully-scored item reaches the threshold.
-    Certificates: the seen-set top-5 at the stop depth equals
-    the exhaustive top-5 exactly (ta_viol == 0 — the safety
-    theorem), and the gap between the stop depth and the
-    EARLIEST depth whose top-5 was already correct is emitted
-    (conservatism >= 0: TA keeps scanning because it cannot
-    prove what it already has — the price of a
-    distribution-free guarantee), with the items-touched
-    census against the full 40.  Scale: the all-depths
-    formulation is a rank band join — the audit shape for
-    choosing access budgets."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q790_documents")
-    parts, fin = _q790_sql("q790_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q791: SCD type-2 dimension — interval construction certified
-# gap-free, overlap-free, and as-of-correct against the log
-
-
-def _q791_sql(tbl: str, d: str, mat: str, es: str):
-    parts = [
-        # change log: per (user) attribute updates over time
-        "lg AS{mat} (SELECT CAST(user_id AS BIGINT) AS k,\n"
-        "   {es} AS ts2, CAST(event_id AS BIGINT) AS seq,\n"
-        "   CAST(event_id % 5 AS BIGINT) AS attr\n"
-        "  FROM events WHERE event_id < 2000)",
-        # type-2 rows: valid_from inclusive, valid_to
-        # exclusive (next change), open rows to the sentinel
-        "sc AS{mat} (SELECT k, ts2 AS vf, attr, seq,\n"
-        "   coalesce(lead(ts2) OVER (PARTITION BY k ORDER BY"
-        " ts2, seq),\n"
-        "     9999999999) AS vt\n"
-        "  FROM lg)",
-        # interval sanity: no overlaps, no gaps, one open row
-        "ov AS (SELECT CAST(coalesce(sum(1), 0) AS BIGINT) AS"
-        " overlap_viol\n"
-        "  FROM sc a JOIN sc b ON b.k = a.k AND b.vf > a.vf\n"
-        "   AND b.vf < a.vt)",
-        "gp AS (SELECT CAST(sum(CASE WHEN n.k IS NULL THEN 1"
-        " ELSE 0 END)\n"
-        "   AS BIGINT) AS gap_viol FROM sc a\n"
-        "  LEFT JOIN (SELECT DISTINCT k, vf FROM sc) n\n"
-        "   ON n.k = a.k AND n.vf = a.vt\n"
-        "  WHERE a.vt <> 9999999999)",
-        "op2 AS (SELECT CAST(sum(CASE WHEN cnt <> 1 THEN 1"
-        " ELSE 0 END)\n"
-        "   AS BIGINT) AS open_viol FROM\n"
-        "  (SELECT k, CAST(sum(CASE WHEN vt = 9999999999 THEN"
-        " 1 ELSE 0 END)\n"
-        "    AS BIGINT) AS cnt FROM sc GROUP BY k) z)",
-        # as-of queries at three probe times: the interval
-        # lookup must equal the last log entry at-or-before
-        "pr AS (SELECT CAST(x AS BIGINT) AS pt FROM (VALUES\n"
-        "   (1704326400), (1704672000), (1704931200)) t(x))",
-        "m1 AS (SELECT p.pt, s.k, s.attr FROM pr p\n"
-        "  JOIN sc s ON s.vf <= p.pt AND p.pt < s.vt)",
-        "m2 AS (SELECT p.pt, l.k,\n"
-        "   CAST(max_by(l.attr, l.ts2 * 100000 + l.seq) AS"
-        " BIGINT) AS attr\n"
-        "  FROM pr p JOIN lg l ON l.ts2 <= p.pt\n"
-        "  GROUP BY p.pt, l.k)",
-        "av AS (SELECT CAST(count(*) AS BIGINT) AS asof_viol\n"
-        "  FROM m1 a FULL OUTER JOIN m2 b ON b.pt = a.pt AND"
-        " b.k = a.k\n"
-        "   AND b.attr = a.attr\n"
-        "  WHERE a.k IS NULL OR b.k IS NULL)",
-    ]
-    fin = (
-        "SELECT p.pt, CAST(count(*) AS BIGINT) AS"
-        " n_keys_asof,\n"
-        "  max(o.overlap_viol) AS overlap_viol,\n"
-        "  max(g.gap_viol) AS gap_viol,\n"
-        "  max(o2.open_viol) AS open_viol,\n"
-        "  max(v.asof_viol) AS asof_viol\n"
-        "FROM pr p LEFT JOIN m1 m ON m.pt = p.pt\n"
-        "CROSS JOIN ov o CROSS JOIN gp g CROSS JOIN op2 o2\n"
-        "CROSS JOIN av v\n"
-        "GROUP BY p.pt")
-    return parts, fin
-
-
-def _q791_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q791_sql(tbl, d, mat,
-                           "CAST(floor(epoch(ts)) AS BIGINT)")
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           .replace("{es}", "CAST(floor(epoch(ts)) AS BIGINT)")
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q791_scd2_intervals",
-       "WITH " + _q791_join("documents", "//", " MATERIALIZED"))
-def q791(spark, sf_dir):
-    """Slowly-changing dimension type 2 (Kimball's
-    valid_from/valid_to history rows — how every warehouse
-    keeps yesterday's attribute joinable to yesterday's
-    facts) built from the real event log and certified on the
-    four contracts that make as-of joins trustworthy:
-    intervals per key never OVERLAP, never leave GAPS
-    (consecutive rows abut exactly: next valid_from equals
-    this valid_to), exactly ONE open row per key (the
-    sentinel-terminated current version), and AS-OF
-    CORRECTNESS — the half-open interval lookup [vf, vt) at
-    three probe times equals an independent last-entry-at-or-
-    before reconstruction from the raw log, key for key
-    (asof_viol == 0; the FULL OUTER JOIN also catches phantom
-    and missing keys).  The half-open convention is exactly
-    what makes the probe at a change instant unambiguous.
-    Scale: construction is one lead() window per key; the
-    certificates are band joins — an audit to run after every
-    dimension rebuild."""
-    _t(spark, sf_dir, "events").createOrReplaceTempView(
-        "events")
-    parts, fin = _q791_sql("events", "div", "",
-                           "CAST(unix_timestamp(ts) AS"
-                           " BIGINT)")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            .replace("{es}", "CAST(unix_timestamp(ts) AS"
-                     " BIGINT)")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q792: session guarantees — read-your-writes and monotonic reads
-# audited over replica apply schedules
-
-
-_Q792_AP = ",\n   ".join(
-    # applied(replica, time, wid): replica 0 applies writes
-    # promptly; replica 1 lags (w1 applied only at t=4, w3 never
-    # within horizon)
-    [f"(0, {t}, {w})" for t in range(1, 7)
-     for w in range(1, t + 1) if w <= 4]
-    + [f"(1, {t}, {w})" for t in range(1, 7)
-       for w in range(1, 5)
-       if (w == 1 and t >= 4) or (w == 2 and t >= 3)
-       or (w == 4 and t >= 6)])
-
-_Q792_OPS = ",\n   ".join([
-    # (sess, seq, kind, replica, t, wid): kind 1 write, 2 read
-    # session 1: sticky to replica 0
-    "(1, 1, 1, 0, 1, 1)", "(1, 2, 2, 0, 2, -1)",
-    "(1, 3, 1, 0, 3, 3)", "(1, 4, 2, 0, 5, -1)",
-    # session 2: writes at replica 0, reads bounce to the
-    # laggard replica 1 — the anti-pattern
-    "(2, 1, 1, 0, 1, 2)", "(2, 2, 2, 1, 2, -1)",
-    "(2, 3, 2, 0, 3, -1)", "(2, 4, 2, 1, 4, -1)"])
-
-
-def _q792_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "ap AS (SELECT * FROM (VALUES\n   " + _Q792_AP
-        + ") t(rep, t, wid))",
-        "op AS (SELECT * FROM (VALUES\n   " + _Q792_OPS
-        + ") t(sess, seq, kind, rep, t, wid))",
-        # read-your-writes: a read must see every earlier
-        # same-session write
-        "ryw AS (SELECT r.sess,\n"
-        "   CAST(sum(CASE WHEN a.wid IS NULL THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS ryw_viol\n"
-        "  FROM op r JOIN op w ON w.sess = r.sess AND w.kind"
-        " = 1\n"
-        "   AND w.seq < r.seq\n"
-        "  LEFT JOIN ap a ON a.rep = r.rep AND a.t = r.t AND"
-        " a.wid = w.wid\n"
-        "  WHERE r.kind = 2 GROUP BY r.sess)",
-        # monotonic reads: a later read's visible set must
-        # contain every write an earlier read saw
-        "mr AS (SELECT r2.sess,\n"
-        "   CAST(sum(CASE WHEN a2.wid IS NULL THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS mr_viol\n"
-        "  FROM op r1 JOIN op r2 ON r2.sess = r1.sess AND"
-        " r2.kind = 2\n"
-        "   AND r1.kind = 2 AND r2.seq > r1.seq\n"
-        "  JOIN ap a1 ON a1.rep = r1.rep AND a1.t = r1.t\n"
-        "  LEFT JOIN ap a2 ON a2.rep = r2.rep AND a2.t ="
-        " r2.t\n"
-        "   AND a2.wid = a1.wid\n"
-        "  GROUP BY r2.sess)",
-        # stickiness: does the session ever change replica?
-        "st AS (SELECT sess, CAST(count(DISTINCT rep) AS"
-        " BIGINT) AS n_reps\n"
-        "  FROM op GROUP BY sess)",
-    ]
-    fin = (
-        "SELECT s.sess, s.n_reps,\n"
-        "  CASE WHEN s.n_reps = 1 THEN 1 ELSE 0 END AS"
-        " sticky,\n"
-        "  coalesce(r.ryw_viol, 0) AS ryw_viol,\n"
-        "  coalesce(m.mr_viol, 0) AS mr_viol,\n"
-        "  CASE WHEN s.n_reps = 1 AND (coalesce(r.ryw_viol,"
-        " 0) > 0\n"
-        "   OR coalesce(m.mr_viol, 0) > 0) THEN 1 ELSE 0 END\n"
-        "    AS sticky_theorem_viol\n"
-        "FROM st s LEFT JOIN ryw r ON r.sess = s.sess\n"
-        "LEFT JOIN mr m ON m.sess = s.sess")
-    return parts, fin
-
-
-def _q792_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q792_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q792_session_guarantees",
-       "WITH " + _q792_join("documents", "//", " MATERIALIZED"))
-def q792(spark, sf_dir):
-    """Session guarantees (Terry et al. 1994, Bayou —
-    read-your-writes and monotonic reads, the client-visible
-    consistency contract a replicated serving tier either
-    engineers or violates) audited relationally over replica
-    apply schedules.  Two replicas — one prompt, one laggard
-    — and two sessions: the STICKY session (all operations on
-    one replica) passes both guarantees with zero violations,
-    and the sticky-session THEOREM (pinning implies both
-    guarantees, because a replica's applied set only grows)
-    holds as data (sticky_theorem_viol == 0); the bouncing
-    session writes at the prompt replica and reads at the
-    laggard — its first bounced read misses its own write
-    (ryw_viol > 0) and a later bounced read sees LESS than an
-    earlier prompt read (mr_viol > 0): time-travel backwards,
-    the exact anomaly session tokens exist to prevent.  The
-    audit is two joins against the applied-set table — the
-    shape of a real consistency monitor over replication
-    lag."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q792_documents")
-    parts, fin = _q792_sql("q792_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q793: predicate placement on outer joins — ON vs WHERE, and the
-# strictness rewrite, certified on the real tables
-
-
-def _q793_sql(tbl: str, d: str, mat: str):
-    parts = [
-        "od AS (SELECT CAST(o_orderkey AS BIGINT) AS ok,\n"
-        "   CAST(o_custkey AS BIGINT) AS ck,\n"
-        "   o_orderpriority AS pri FROM orders)",
-        "cs AS (SELECT CAST(c_custkey AS BIGINT) AS ck,\n"
-        "   c_mktsegment AS seg FROM customer)",
-        # variant 1: the filter in the ON clause — left rows
-        # all survive, non-matching ones null-extended
-        "v1 AS{mat} (SELECT o.ok, o.ck, c.ck AS cck\n"
-        "  FROM od o LEFT JOIN cs c ON c.ck = o.ck\n"
-        "   AND c.seg = 'BUILDING')",
-        # variant 2: the same predicate in WHERE — strict on
-        # the nullable side, silently an inner join
-        "v2 AS{mat} (SELECT o.ok, o.ck, c.ck AS cck\n"
-        "  FROM od o LEFT JOIN cs c ON c.ck = o.ck\n"
-        "  WHERE c.seg = 'BUILDING')",
-        "v3 AS (SELECT o.ok, o.ck, c.ck AS cck\n"
-        "  FROM od o JOIN cs c ON c.ck = o.ck\n"
-        "   AND c.seg = 'BUILDING')",
-        "c1 AS (SELECT\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM v1) AS"
-        " on_rows,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM v2) AS"
-        " where_rows,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM od) AS"
-        " left_rows,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM v1 WHERE"
-        " cck IS NULL)\n"
-        "     AS null_extended)",
-        # the strictness rewrite: WHERE-variant == INNER join
-        "c2 AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " rewrite_viol\n"
-        "  FROM v2 a FULL OUTER JOIN v3 b ON b.ok = a.ok\n"
-        "  WHERE a.ok IS NULL OR b.ok IS NULL)",
-        # left-side predicates commute with the outer join:
-        # push below == apply above
-        "p1 AS (SELECT ok FROM v1 WHERE pri2 = '1-URGENT')"
-        .replace("FROM v1 WHERE pri2 = '1-URGENT'",
-                 "FROM (SELECT v.ok, o.pri AS pri2 FROM v1 v"
-                 " JOIN od o ON o.ok = v.ok) z WHERE pri2 ="
-                 " '1-URGENT'"),
-        "p2 AS (SELECT o.ok FROM (SELECT * FROM od WHERE pri"
-        " = '1-URGENT') o\n"
-        "  LEFT JOIN cs c ON c.ck = o.ck AND c.seg ="
-        " 'BUILDING')",
-        "c3 AS (SELECT CAST(count(*) AS BIGINT) AS"
-        " pushdown_viol\n"
-        "  FROM p1 a FULL OUTER JOIN p2 b ON b.ok = a.ok\n"
-        "  WHERE a.ok IS NULL OR b.ok IS NULL)",
-    ]
-    fin = (
-        "SELECT c.on_rows, c.where_rows, c.left_rows,\n"
-        "  c.null_extended,\n"
-        "  c.on_rows - c.left_rows AS cardinality_viol,\n"
-        "  c.on_rows - c.where_rows - c.null_extended AS"
-        " accounting_viol,\n"
-        "  r.rewrite_viol, p.pushdown_viol\n"
-        "FROM c1 c CROSS JOIN c2 r CROSS JOIN c3 p")
-    return parts, fin
-
-
-def _q793_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q793_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q793_outer_join_pushdown",
-       "WITH " + _q793_join("documents", "//", " MATERIALIZED"))
-def q793(spark, sf_dir):
-    """Predicate placement on OUTER joins — the ON-vs-WHERE
-    semantics gap that silently turns left joins into inner
-    joins, and the two rewrites an optimizer may and may not
-    make, certified on the real orders/customer tables.  The
-    ON-clause filter preserves left cardinality exactly
-    (cardinality_viol == 0: every order survives, non-BUILDING
-    customers null-extend) and the accounting identity
-    on_rows == where_rows + null_extended splits the
-    difference precisely.  The WHERE placement is STRICT on
-    the nullable side — certified row-identical to a plain
-    inner join (rewrite_viol == 0), which is both the bug
-    (when the user meant ON) and the optimizer's licensed
-    simplification (when the predicate is genuinely strict).
-    LEFT-side predicates, by contrast, commute with the outer
-    join: pushing the orders filter below the join equals
-    applying it above, row for row (pushdown_viol == 0) — the
-    pushdown Catalyst actually performs.  Scale: these
-    identities are what make filter-pushdown safe at 100 TB;
-    this query is their regression net."""
-    for t in ("orders", "customer"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    parts, fin = _q793_sql("documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q794: check digits — Luhn's exact transposition blind spot vs
-# ISBN-10's completeness, both by total error census
-
-
-def _q794_sql(tbl: str, d: str, mat: str):
-    parts = [
-        # 8-digit payloads from key arithmetic, digit-long
-        f"nd AS (SELECT CAST(doc_id AS BIGINT) AS nid"
-        f" FROM {tbl} WHERE doc_id < 20)",
-        f"ps AS (SELECT CAST(doc_id + 1 AS BIGINT) AS p"
-        f" FROM {tbl} WHERE doc_id < 8)",
-        "dg AS{mat} (SELECT n.nid, p.p,\n"
-        "   ((n.nid * 131 + p.p * n.nid + p.p * p.p * 7) %"
-        " 10) AS v\n"
-        "  FROM nd n CROSS JOIN ps p)",
-        # Luhn: double every second digit from the right
-        # (positions 8,6,..), subtract 9 above 9; checksum of
-        # payload+check == 0 mod 10.  We compare SYNDROMES of
-        # corrupted payloads — a scheme detects an error iff
-        # the syndrome changes.
-        "lu AS (SELECT nid, CAST(sum(CASE WHEN p % 2 = 0 THEN\n"
-        "   CASE WHEN 2 * v > 9 THEN 2 * v - 9 ELSE 2 * v"
-        " END\n"
-        "   ELSE v END) % 10 AS BIGINT) AS syn FROM dg GROUP"
-        " BY nid)",
-        "ib AS (SELECT nid, CAST(sum(v * p) % 11 AS BIGINT)"
-        " AS syn\n"
-        "  FROM dg GROUP BY nid)",
-        # single-digit errors: every position x every wrong
-        # value
-        "se AS{mat} (SELECT g.nid, g.p AS ep, w.w\n"
-        "  FROM dg g JOIN (SELECT CAST(doc_id AS BIGINT) AS"
-        " w\n"
-        f"    FROM {tbl} WHERE doc_id < 10) w ON w.w <> g.v)",
-        "lu1 AS (SELECT e.nid, e.ep, e.w,\n"
-        "   CAST(sum(CASE WHEN g.p % 2 = 0 THEN\n"
-        "     CASE WHEN 2 * (CASE WHEN g.p = e.ep THEN e.w"
-        " ELSE g.v END) > 9\n"
-        "      THEN 2 * (CASE WHEN g.p = e.ep THEN e.w ELSE"
-        " g.v END) - 9\n"
-        "      ELSE 2 * (CASE WHEN g.p = e.ep THEN e.w ELSE"
-        " g.v END) END\n"
-        "    ELSE (CASE WHEN g.p = e.ep THEN e.w ELSE g.v"
-        " END) END) % 10\n"
-        "     AS BIGINT) AS syn\n"
-        "  FROM se e JOIN dg g ON g.nid = e.nid\n"
-        "  GROUP BY e.nid, e.ep, e.w)",
-        "ib1 AS (SELECT e.nid, e.ep, e.w,\n"
-        "   CAST(sum((CASE WHEN g.p = e.ep THEN e.w ELSE g.v"
-        " END) * g.p)\n"
-        "     % 11 AS BIGINT) AS syn\n"
-        "  FROM se e JOIN dg g ON g.nid = e.nid\n"
-        "  GROUP BY e.nid, e.ep, e.w)",
-        "s1 AS (SELECT\n"
-        "   (SELECT CAST(sum(CASE WHEN a.syn = l.syn THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) FROM lu1 a JOIN lu l ON l.nid ="
-        " a.nid)\n"
-        "     AS luhn_single_missed,\n"
-        "   (SELECT CAST(sum(CASE WHEN a.syn = i.syn THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) FROM ib1 a JOIN ib i ON i.nid ="
-        " a.nid)\n"
-        "     AS isbn_single_missed,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM lu1) AS"
-        " n_single)",
-        # adjacent transpositions: swap positions p, p+1
-        "tl AS (SELECT a.nid, a.p AS tp, a.v AS va, b.v AS"
-        " vb\n"
-        "  FROM dg a JOIN dg b ON b.nid = a.nid AND b.p = a.p"
-        " + 1\n"
-        "  WHERE a.v <> b.v)",
-        "lu2 AS (SELECT t.nid, t.tp, t.va, t.vb,\n"
-        "   CAST(sum(CASE WHEN g.p % 2 = 0 THEN\n"
-        "     CASE WHEN 2 * (CASE WHEN g.p = t.tp THEN t.vb\n"
-        "       WHEN g.p = t.tp + 1 THEN t.va ELSE g.v END) >"
-        " 9\n"
-        "      THEN 2 * (CASE WHEN g.p = t.tp THEN t.vb\n"
-        "       WHEN g.p = t.tp + 1 THEN t.va ELSE g.v END) -"
-        " 9\n"
-        "      ELSE 2 * (CASE WHEN g.p = t.tp THEN t.vb\n"
-        "       WHEN g.p = t.tp + 1 THEN t.va ELSE g.v END)"
-        " END\n"
-        "    ELSE (CASE WHEN g.p = t.tp THEN t.vb\n"
-        "     WHEN g.p = t.tp + 1 THEN t.va ELSE g.v END)"
-        " END) % 10\n"
-        "     AS BIGINT) AS syn\n"
-        "  FROM tl t JOIN dg g ON g.nid = t.nid\n"
-        "  GROUP BY t.nid, t.tp, t.va, t.vb)",
-        "ib2 AS (SELECT t.nid, t.tp, t.va, t.vb,\n"
-        "   CAST(sum((CASE WHEN g.p = t.tp THEN t.vb\n"
-        "     WHEN g.p = t.tp + 1 THEN t.va ELSE g.v END) *"
-        " g.p) % 11\n"
-        "     AS BIGINT) AS syn\n"
-        "  FROM tl t JOIN dg g ON g.nid = t.nid\n"
-        "  GROUP BY t.nid, t.tp, t.va, t.vb)",
-        "s2 AS (SELECT\n"
-        "   (SELECT CAST(sum(CASE WHEN a.syn = l.syn THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) FROM lu2 a JOIN lu l ON l.nid ="
-        " a.nid)\n"
-        "     AS luhn_trans_missed,\n"
-        "   (SELECT CAST(sum(CASE WHEN a.syn = i.syn THEN 1"
-        " ELSE 0 END)\n"
-        "     AS BIGINT) FROM ib2 a JOIN ib i ON i.nid ="
-        " a.nid)\n"
-        "     AS isbn_trans_missed,\n"
-        "   (SELECT CAST(count(*) AS BIGINT) FROM lu2) AS"
-        " n_trans,\n"
-        "   (SELECT CAST(sum(CASE WHEN a.syn = l.syn AND NOT\n"
-        "     ((a.va = 0 AND a.vb = 9) OR (a.va = 9 AND a.vb"
-        " = 0))\n"
-        "     THEN 1 ELSE 0 END) AS BIGINT)\n"
-        "    FROM lu2 a JOIN lu l ON l.nid = a.nid) AS"
-        " luhn_non09_missed)",
-    ]
-    fin = (
-        "SELECT a.n_single, a.luhn_single_missed,\n"
-        "  a.isbn_single_missed,\n"
-        "  b.n_trans, b.luhn_trans_missed,\n"
-        "  b.isbn_trans_missed, b.luhn_non09_missed\n"
-        "FROM s1 a CROSS JOIN s2 b")
-    return parts, fin
-
-
-def _q794_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q794_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q794_check_digits",
-       "WITH " + _q794_join("documents", "//", " MATERIALIZED"))
-def q794(spark, sf_dir):
-    """Check-digit schemes by TOTAL error census — Luhn (mod
-    10, the card-number checksum) versus ISBN-10 (mod 11,
-    position weights): the data-entry error model every ID
-    validator lives under.  Twenty 8-digit payloads; EVERY
-    single-digit corruption (all positions x all nine wrong
-    values) and EVERY adjacent transposition of unequal
-    digits is applied, and an error is detected iff the
-    syndrome moves.  Results: both schemes catch ALL single-
-    digit errors (the doubling map and the distinct mod-11
-    weights are both injective per position — missed == 0);
-    for transpositions ISBN-10 again misses NOTHING (weights
-    differ by 1, a unit mod 11), while Luhn's misses are
-    EXACTLY the 09 <-> 90 swaps (luhn_non09_missed == 0 —
-    every miss involves the {0,9} pair, since 2v-9 folding
-    makes 0 and 9 the unique colliding neighbors).  The
-    famous blind spot isolated by exhaustion, and the reason
-    mod-11 needed an 'X' digit.  Scale: the census is
-    payloads x positions x values — bounded fan-out joins."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q794_documents")
-    parts, fin = _q794_sql("q794_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
-
-
-# ---------------------------------------------------------------------------
-# q795: Gregorian calendar arithmetic — the 4/100/400 census,
-# the 146097-day cycle, and why it is exactly 20871 weeks
-
-
-def _q795_sql(tbl: str, d: str, mat: str):
-    parts = [
-        f"yr AS (SELECT CAST(doc_id + 1 AS BIGINT) * 6 - x.o"
-        f" AS y\n"
-        f"  FROM {tbl} CROSS JOIN (VALUES (0), (1), (2), (3),"
-        f" (4), (5)) x(o)\n"
-        f"  WHERE doc_id < 400)",
-        "lp AS{mat} (SELECT y,\n"
-        "   CASE WHEN y % 400 = 0 THEN 1 WHEN y % 100 = 0"
-        " THEN 0\n"
-        "        WHEN y % 4 = 0 THEN 1 ELSE 0 END AS greg,\n"
-        "   CASE WHEN y % 4 = 0 THEN 1 ELSE 0 END AS jul\n"
-        "  FROM yr WHERE y <= 2400)",
-        # censuses over 1..2400 (six full 400-year cycles)
-        "cn AS (SELECT CAST(sum(greg) AS BIGINT) AS"
-        " greg_leaps,\n"
-        "   CAST(sum(jul) AS BIGINT) AS jul_leaps,\n"
-        "   CAST(sum(CASE WHEN greg <> jul THEN 1 ELSE 0"
-        " END) AS BIGINT)\n"
-        "     AS century_exceptions,\n"
-        "   CAST(count(*) AS BIGINT) AS n_years FROM lp)",
-        # one 400-year cycle: 97 leaps, 146097 days, exactly\n
-        # 20871 weeks — the calendar repeats its weekdays
-        "cy AS (SELECT CAST(sum(greg) AS BIGINT) AS"
-        " cycle_leaps,\n"
-        "   365 * 400 + CAST(sum(greg) AS BIGINT) AS"
-        " cycle_days\n"
-        "  FROM lp WHERE y BETWEEN 2001 AND 2400)",
-        "wk AS (SELECT cycle_leaps, cycle_days,\n"
-        "   cycle_days - 146097 AS days_viol,\n"
-        "   cycle_days % 7 AS week_resid\n"
-        "  FROM cy)",
-        # the witnesses everyone gets wrong: 1900 no, 2000 yes
-        "wt AS (SELECT\n"
-        "   (SELECT greg FROM lp WHERE y = 1900) AS"
-        " leap_1900,\n"
-        "   (SELECT greg FROM lp WHERE y = 2000) AS"
-        " leap_2000,\n"
-        "   (SELECT jul FROM lp WHERE y = 1900) AS"
-        " julian_1900)",
-        # mean year length vs the tropical year, exact
-        # rationals: Gregorian 146097/400 = 365.2425 vs Julian
-        # 365.25 — drift per 400 years in days
-        "dr AS (SELECT (365 * 400 +\n"
-        "   (SELECT jul_leaps FROM cn) {d} 6) - 146097 AS"
-        " julian_extra_days_400y)",
-    ]
-    fin = (
-        "SELECT c.n_years, c.greg_leaps, c.jul_leaps,\n"
-        "  c.century_exceptions, k.cycle_leaps,\n"
-        "  k.cycle_days, k.days_viol, k.week_resid,\n"
-        "  w.leap_1900, w.leap_2000, w.julian_1900,\n"
-        "  d.julian_extra_days_400y\n"
-        "FROM cn c CROSS JOIN wk k CROSS JOIN wt w\n"
-        "CROSS JOIN dr d")
-    return parts, fin
-
-
-def _q795_join(tbl: str, d: str, mat: str) -> str:
-    parts, fin = _q795_sql(tbl, d, mat)
-    out = [p.replace("{mat}", mat).replace("{d}", d)
-           for p in parts]
-    return ",\n       ".join(out) + "\n" + fin
-
-
-@query("q795_gregorian_census",
-       "WITH " + _q795_join("documents", "//", " MATERIALIZED"))
-def q795(spark, sf_dir):
-    """Gregorian calendar arithmetic by census — the 4/100/400
-    rule every date library implements and every hand-rolled
-    `year % 4` check gets wrong (the q760 ISO-week companion
-    at the year scale).  All 2400 years counted: 582 Gregorian
-    leap years vs 600 Julian, with exactly 18 century
-    exceptions (the 100-but-not-400 years); the witnesses
-    emitted — 1900 is NOT a leap year, 2000 IS, and Julian
-    says yes to both.  The 400-year cycle: 97 leaps, 146097
-    days (days_viol == 0), and 146097 % 7 == 0 — the cycle is
-    EXACTLY 20871 weeks, which is why the Gregorian calendar
-    repeats its weekday pattern every 400 years (and why
-    day-of-week lookup tables work at all).  The Julian
-    calendar's over-count lands as exactly 3 extra days per
-    400 years (the drift that had accumulated to 10 days by
-    1582).  Scale: a dim census — the regression net under
-    every epoch-day computation in this repo."""
-    _t(spark, sf_dir, "documents") \
-        .createOrReplaceTempView("q795_documents")
-    parts, fin = _q795_sql("q795_documents", "div", "")
-    kept = [p.replace("{mat}", "").replace("{d}", "div")
-            for p in parts]
-    return spark.sql("WITH " + ",\n       ".join(kept)
-                     + "\n" + fin)
 
 
 # ---------------------------------------------------------------------------
@@ -72356,7 +12207,7 @@ _Q796_ORACLE = """WITH pd AS (SELECT DISTINCT CAST(doc_id % 64 AS BIGINT) AS p
              GROUP BY relation) n ON n.relation = r.relation"""
 
 
-@query("q796_line_line_relation", _Q796_ORACLE)
+@query("q796_line_line_relation", _Q796_ORACLE, kind="operator")
 def q796(spark, sf_dir):
     """LINESTRING-vs-LINESTRING DE-9IM predicates — the r4
     verdict's #3, closing §2.2's last named-predicate gap
@@ -72451,7 +12302,7 @@ _Q797_ORACLE = """WITH ids AS (SELECT DISTINCT CAST(doc_id % 48 AS BIGINT) AS id
        FROM vx v JOIN cs c ON c.id = v.id"""
 
 
-@query("q797_curve_linearize_subdivided", _Q797_ORACLE)
+@query("q797_curve_linearize_subdivided", _Q797_ORACLE, kind="operator")
 def q797(spark, sf_dir):
     """Curve linearization with the SUBDIVIDED path oracled — the r4
     verdict's #6 (kernels/wkbext.py::linearize_wkb previously had
@@ -72537,7 +12388,7 @@ _Q798_ORACLE = """WITH pd AS (SELECT DISTINCT CAST(doc_id % 160 AS BIGINT) AS p
        FROM sh"""
 
 
-@query("q798_ntv2_gridshift", _Q798_ORACLE)
+@query("q798_ntv2_gridshift", _Q798_ORACLE, kind="operator")
 def q798(spark, sf_dir):
     """NTv2 datum grid-shift driven through the REAL binary format
     — the machinery half of the r4 verdict's top missing item
@@ -72599,7 +12450,7 @@ _Q799_ORACLE = """SELECT CAST(doc_id % 160 AS BIGINT) AS p,
        FROM documents GROUP BY doc_id % 160"""
 
 
-@query("q799_ntv2_roundtrip", _Q799_ORACLE)
+@query("q799_ntv2_roundtrip", _Q799_ORACLE, kind="operator")
 def q799(spark, sf_dir):
     """NTv2 datum shift FORWARD + iterative INVERSE round trip —
     the q121 contract applied to the grid-shift machinery: the

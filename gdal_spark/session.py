@@ -9,6 +9,7 @@ coalesce + skew-join splitting), Arrow batching for pandas UDFs.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -32,6 +33,16 @@ def _default_driver_mem() -> str:
     except OSError:
         pass
     return f"{cap_mb}m"
+
+
+def _worker_pythonpath() -> str:
+    """The directory holding ``gdal_spark``, ahead of any inherited
+    PYTHONPATH: Python workers start in the driver's working directory,
+    so without it they cannot import the package's UDFs unless the
+    driver was started from the repo root."""
+    root = str(Path(__file__).resolve().parent.parent)
+    inherited = os.environ.get("PYTHONPATH")
+    return os.pathsep.join([root, inherited]) if inherited else root
 
 
 def get_spark(
@@ -69,6 +80,7 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(),
         )
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )

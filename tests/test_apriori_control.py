@@ -20,7 +20,7 @@ engines at sf0.001 and asserts the claims the control exists to prove:
 import duckdb
 import pytest
 
-from gdal_spark.queries import _q607_sql
+from parity_queries import _q607_sql
 
 SF = "/root/testdata/sf0.001"  # 500 docs — the brute cube stays small
 

@@ -11,7 +11,7 @@ import zlib
 import duckdb
 import pytest
 
-from gdal_spark.queries import ORACLES, _Q564_AJ, _Q564_T1
+from parity_queries import ORACLES, _Q564_AJ, _Q564_T1
 
 SF = "/root/testdata/sf0.001"
 POLY = 0xEDB88320

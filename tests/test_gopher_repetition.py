@@ -1,6 +1,6 @@
 """Gopher repetition rules (q239/q240) — injection targeting spec."""
 
-from gdal_spark.queries import QUERIES
+from parity_queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
 

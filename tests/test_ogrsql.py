@@ -199,3 +199,58 @@ def test_ogr_style_passthrough_and_filter(spark, poly):
     assert (got["OGR_STYLE"] == "PEN(c:#FF0000)").all()
     assert got["eas_id"].tolist() == sorted(
         e for _a, e, _p in POLY_RECORDS if e % 2 == 0)
+
+
+def test_ogr_style_inside_function_arguments(spark, poly):
+    """OGR_STYLE as a function argument is substituted without an
+    alias (``COALESCE(style AS OGR_STYLE, ..)`` is not SQL)."""
+    df, _ = poly
+    styled = df.selectExpr(
+        "*", "CASE WHEN eas_id % 2 = 0 THEN 'PEN(c:#FF0000)' END AS style")
+    got = execute_sql(
+        spark,
+        "SELECT eas_id, COALESCE(OGR_STYLE, 'none') AS s, "
+        "CONCAT(OGR_STYLE, '/', prfedea) AS c FROM poly ORDER BY eas_id",
+        layers={"poly": styled},
+    ).toPandas()
+    assert list(got.columns) == ["eas_id", "s", "c"]
+    for r in got.itertuples():
+        assert r.s == ("PEN(c:#FF0000)" if r.eas_id % 2 == 0 else "none")
+        assert (r.c is None) == (r.eas_id % 2 == 1)
+
+
+def test_ogr_style_not_rewritten_in_string_literals(spark, poly):
+    df, _ = poly
+    got = execute_sql(
+        spark,
+        "SELECT eas_id, 'OGR_STYLE' AS lit, OGR_STYLE FROM poly "
+        "WHERE eas_id = 158",
+        layers={"poly": df},
+    ).toPandas()
+    assert list(got.columns) == ["eas_id", "lit", "OGR_STYLE"]
+    assert got["lit"].tolist() == ["OGR_STYLE"]
+    assert got["OGR_STYLE"].isna().all()
+
+
+def test_ogr_style_resolves_against_from_layers_only(spark, poly):
+    """A style column on some OTHER registered layer does not leak into
+    a query whose FROM layer has none; in a join the primary layer's
+    style is the one read."""
+    df, _ = poly
+    styled = df.selectExpr("eas_id AS sid", "'BRUSH(fc:#00FF00)' AS style")
+    got = execute_sql(
+        spark,
+        "SELECT eas_id, OGR_STYLE FROM poly WHERE eas_id = 158",
+        layers={"poly": df, "styled_other": styled},
+    ).toPandas()
+    assert got["OGR_STYLE"].isna().all()
+    both = df.selectExpr("*", "'PEN(c:#0000FF)' AS style")
+    got = execute_sql(
+        spark,
+        "SELECT p.eas_id, OGR_STYLE FROM poly_styled p "
+        "JOIN styled_other s ON p.eas_id = s.sid ORDER BY p.eas_id",
+        layers={"poly_styled": both, "styled_other": styled},
+    ).toPandas()
+    assert list(got.columns) == ["eas_id", "OGR_STYLE"]
+    assert len(got) == len(POLY_RECORDS)
+    assert (got["OGR_STYLE"] == "PEN(c:#0000FF)").all()

@@ -7,7 +7,10 @@ batches.  The executed plan must show one broadcast hash join per
 subspace and stay small and free of element_at literal indexing.
 """
 
-from gdal_spark.queries import QUERIES
+from gdal_spark import queries as _registry
+import parity_queries
+
+QUERIES = {**_registry.QUERIES, **parity_queries.QUERIES}
 
 SF = "/root/testdata/sf0.01"
 

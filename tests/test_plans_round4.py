@@ -9,7 +9,10 @@
   (the candidate bound is the operator's linearity story).
 """
 
-from gdal_spark.queries import QUERIES
+from gdal_spark import queries as _registry
+import parity_queries
+
+QUERIES = {**_registry.QUERIES, **parity_queries.QUERIES}
 
 SF = "/root/testdata/sf0.01"
 

@@ -4,12 +4,13 @@ CartesianProduct (the bounded keypoint/palette pair joins are
 BroadcastNestedLoopJoin by design)."""
 
 import __spark_entry__ as e
+import parity_queries
 
 SF = "/root/testdata/sf0.001"
 
 
 def _plan(spark, name):
-    df = e.queries()[name](spark, SF)
+    df = {**e.queries(), **parity_queries.QUERIES}[name](spark, SF)
     return df._jdf.queryExecution().executedPlan().toString()
 
 

@@ -2,13 +2,13 @@
 broadcast, per-doc combinatorics must hash-aggregate (no window over
 the gram table), and nothing degenerates into a CartesianProduct."""
 
-import __spark_entry__ as e
+import parity_queries
 
 SF = "/root/testdata/sf0.001"
 
 
 def _plan(spark, name):
-    df = e.queries()[name](spark, SF)
+    df = parity_queries.QUERIES[name](spark, SF)
     return df._jdf.queryExecution().executedPlan().toString()
 
 

@@ -8,7 +8,7 @@ combinable hash aggregates — never a window over the corpus-sized
 table, never a cartesian product of two big sides.
 """
 
-from gdal_spark.queries import QUERIES
+from parity_queries import QUERIES
 
 SF = "/root/testdata/sf0.01"
 

@@ -6,7 +6,7 @@ scans), and the RANGE frame is a real range frame."""
 
 from __future__ import annotations
 
-from gdal_spark.queries import QUERIES
+from parity_queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
 

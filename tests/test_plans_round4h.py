@@ -7,7 +7,10 @@ map-side partial aggregation rather than a window sort."""
 
 from __future__ import annotations
 
-from gdal_spark.queries import QUERIES
+from gdal_spark import queries as _registry
+import parity_queries
+
+QUERIES = {**_registry.QUERIES, **parity_queries.QUERIES}
 
 SF = "/root/testdata/sf0.001"
 

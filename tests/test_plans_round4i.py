@@ -8,7 +8,10 @@ cross product), and the iterative operators' lineage is truncated
 
 from __future__ import annotations
 
-from gdal_spark.queries import QUERIES
+from gdal_spark import queries as _registry
+import parity_queries
+
+QUERIES = {**_registry.QUERIES, **parity_queries.QUERIES}
 
 SF = "/root/testdata/sf0.001"
 

@@ -1,7 +1,8 @@
 """Mirror of the driver's correctness gate: run every queries() entry
 on sf0.001 and compare to its DuckDB oracle (row count + order-
 insensitive values).  sf0.001 keeps the suite fast; the driver runs
-the same comparison at sf0.01."""
+the same comparison at sf0.01.  The Spark-vs-DuckDB parity corpus
+(``parity_queries``) runs through the same comparison."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+import parity_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [
@@ -43,14 +45,16 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-QUERY_NAMES = sorted(entry_mod.queries())
+QUERIES = {**entry_mod.queries(), **parity_queries.QUERIES}
+ORACLES = {**entry_mod.oracle_sql(), **parity_queries.ORACLES}
+QUERY_NAMES = sorted(QUERIES)
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, ddb, name):
-    fn = entry_mod.queries()[name]
+    fn = QUERIES[name]
     sdf = fn(spark, SF_DIR).toPandas()
-    sql = entry_mod.oracle_sql().get(name)
+    sql = ORACLES.get(name)
     if sql is None:
         assert len(sdf) >= 0  # rows-only contract
         return

@@ -1,7 +1,7 @@
 """Round-4d spec pins: set-type rounding classes, check-geometry flag
 targeting, dissolve invariants, frontier schedule contracts."""
 
-from gdal_spark.queries import QUERIES
+from parity_queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
 

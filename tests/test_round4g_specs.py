@@ -1,7 +1,10 @@
 """Round-4g spec pins: stack-distance curve contracts, MRR eval
 contracts."""
 
-from gdal_spark.queries import QUERIES
+from gdal_spark import queries as _registry
+import parity_queries
+
+QUERIES = {**_registry.QUERIES, **parity_queries.QUERIES}
 
 SF = "/root/testdata/sf0.001"
 

@@ -20,7 +20,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_countmin_never_undercounts(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q278_countmin_sketch"](spark, SF).collect()
     assert len(out) > 0
@@ -31,7 +31,7 @@ def test_countmin_never_undercounts(spark):
 
 
 def test_hll_register_consistency(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q279_hll_cardinality"](spark, SF).collect()
     assert len(out) > 0
@@ -53,7 +53,7 @@ def test_hll_register_consistency(spark):
 
 
 def test_bloom_no_false_negatives(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q282_bloom_blocklist"](spark, SF).collect()
     assert len(out) > 0
@@ -68,7 +68,7 @@ def test_bloom_no_false_negatives(spark):
 
 
 def test_trustrank_seeds_and_reachability(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q280_trustrank"](spark, SF).collect()
     assert len(out) == 40
@@ -95,7 +95,7 @@ def test_trustrank_seeds_and_reachability(spark):
 
 
 def test_anchor_top_term_is_argmax(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q281_anchor_text"](spark, SF).collect()
     assert len(out) == 40
@@ -106,7 +106,7 @@ def test_anchor_top_term_is_argmax(spark):
 
 
 def test_salsa_scores_sum_to_one_per_component(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q286_salsa_authority"](spark, SF).collect()
     assert len(out) > 0
@@ -123,7 +123,7 @@ def test_salsa_scores_sum_to_one_per_component(spark):
 
 
 def test_vbyte_bounds(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q285_vbyte_postings"](spark, SF).collect()
     assert len(out) > 0
@@ -134,7 +134,7 @@ def test_vbyte_bounds(spark):
 
 
 def test_conjunctive_planner_picks_rarest(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q287_conjunctive_planning"](spark, SF).collect()
     assert len(out) == 10
@@ -145,7 +145,7 @@ def test_conjunctive_planner_picks_rarest(spark):
 
 
 def test_containment_pairs_include_template_docs(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q283_shingle_containment"](spark, SF).collect()
     assert len(out) > 0
@@ -157,7 +157,7 @@ def test_containment_pairs_include_template_docs(spark):
 
 
 def test_rrf_fusion_is_consistent(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q289_rrf_fusion"](spark, SF).collect()
     assert len(out) == 20
@@ -171,7 +171,7 @@ def test_rrf_fusion_is_consistent(spark):
 
 
 def test_pmi_collocations_fire_on_injection(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q290_pmi_collocations"](spark, SF).collect()
     grams = {(r.x, r.y) for r in out}
@@ -183,7 +183,7 @@ def test_pmi_collocations_fire_on_injection(spark):
 
 
 def test_link_prediction_candidates_are_nonedges(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q291_link_prediction"](spark, SF).collect()
     assert len(out) > 0
@@ -204,7 +204,7 @@ def test_link_prediction_candidates_are_nonedges(spark):
 
 
 def test_truncated_recall_bounds(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q292_truncated_recall"](spark, SF).collect()
     assert len(out) == 50
@@ -214,7 +214,7 @@ def test_truncated_recall_bounds(spark):
 
 
 def test_hrw_minimal_disruption(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q293_rendezvous_hashing"](spark, SF).collect()
     assert {r.shard for r in out} <= set(range(7))  # shard 7 removed
@@ -230,7 +230,7 @@ def test_hrw_minimal_disruption(spark):
 
 
 def test_logbin_quantiles_bound(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q294_logbin_quantiles"](spark, SF).collect()
     assert {r.pct for r in out} == {50, 90, 99}
@@ -242,7 +242,7 @@ def test_logbin_quantiles_bound(spark):
 
 
 def test_kwic_snippets_contain_term(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q295_kwic_snippets"](spark, SF).collect()
     assert len(out) > 0
@@ -253,7 +253,7 @@ def test_kwic_snippets_contain_term(spark):
 
 
 def test_bipartite_certificates(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.component: r for r in
            Q.QUERIES["q296_bipartite_check"](spark, SF).collect()}
@@ -263,7 +263,7 @@ def test_bipartite_certificates(spark):
 
 
 def test_bigram_lm_surprisal_consistency(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q297_bigram_lm_surprisal"](spark, SF).collect()
     assert len(out) == 250  # held-out odd doc_ids
@@ -275,7 +275,7 @@ def test_bigram_lm_surprisal_consistency(spark):
 
 
 def test_wand_pruning_bounds(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q298_wand_block_pruning"](spark, SF).collect()
     assert len(out) > 0
@@ -285,7 +285,7 @@ def test_wand_pruning_bounds(spark):
 
 
 def test_change_rate_classes(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q299_change_rate"](spark, SF).collect()
     assert len(out) == 500
@@ -300,7 +300,7 @@ def test_change_rate_classes(spark):
 
 
 def test_host_scorecard_invariants(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q300_host_scorecard"](spark, SF).collect()
     assert len(out) == 40
@@ -312,7 +312,7 @@ def test_host_scorecard_invariants(spark):
 
 
 def test_symspell_recovers_original(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q301_symspell_correction"](spark, SF).collect()
     assert len(out) == 10
@@ -325,7 +325,7 @@ def test_symspell_recovers_original(spark):
 
 
 def test_passage_chunks_cover_doc(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q302_passage_chunking"](spark, SF).collect()
     from collections import defaultdict
@@ -342,7 +342,7 @@ def test_passage_chunks_cover_doc(spark):
 
 
 def test_newcomer_dedup_finds_planted(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.doc_id: r for r in
            Q.QUERIES["q303_newcomer_dedup"](spark, SF).collect()}
@@ -356,7 +356,7 @@ def test_newcomer_dedup_finds_planted(spark):
 
 
 def test_ring_loads_conserve_urls(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q305_consistent_hash_ring"](spark, SF).collect()
     assert len(out) == 8
@@ -365,7 +365,7 @@ def test_ring_loads_conserve_urls(spark):
 
 
 def test_burst_detection_has_both_branches(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q306_burst_detection"](spark, SF).collect()
     assert len(out) > 0
@@ -378,7 +378,7 @@ def test_burst_detection_has_both_branches(spark):
 
 
 def test_assortativity_moments_consistent(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     r = Q.QUERIES["q307_degree_assortativity"](spark, SF).collect()[0]
     assert r.m > 0
@@ -392,7 +392,7 @@ def test_assortativity_moments_consistent(spark):
 
 
 def test_cdc_boundary_rate(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q308_cdc_boundaries"](spark, SF).collect()
     assert len(out) == 500
@@ -403,7 +403,7 @@ def test_cdc_boundary_rate(spark):
 
 
 def test_scc_subset_relations(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q309_scc_of_pivot"](spark, SF).collect()
     assert len(out) == 50
@@ -416,7 +416,7 @@ def test_scc_subset_relations(spark):
 
 
 def test_index_partition_loads_conserve(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q310_index_partition_balance"](spark, SF).collect()
     assert len(out) == 8
@@ -425,7 +425,7 @@ def test_index_partition_loads_conserve(spark):
 
 
 def test_mmr_first_pick_is_pure_relevance(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q312_mmr_diversified_topk"](spark, SF).collect()
     assert len(out) == 5
@@ -438,7 +438,7 @@ def test_mmr_first_pick_is_pure_relevance(spark):
 
 
 def test_contamination_matrix_symmetric_keys(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q313_cross_source_contamination"](spark, SF).collect()
     assert len(out) > 0
@@ -448,7 +448,7 @@ def test_contamination_matrix_symmetric_keys(spark):
 
 
 def test_stratified_sampling_deciles(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q314_stratified_hash_sampling"](spark, SF).collect()
     assert sorted(r.decile for r in out) == list(range(1, 11))
@@ -461,7 +461,7 @@ def test_stratified_sampling_deciles(spark):
 
 
 def test_padding_waste_bucketing_dominates(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.strategy: r for r in
            Q.QUERIES["q315_padding_waste"](spark, SF).collect()}
@@ -473,7 +473,7 @@ def test_padding_waste_bucketing_dominates(spark):
 
 
 def test_funnel_is_monotone(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     r = Q.QUERIES["q316_conversion_funnel"](spark, SF).collect()[0]
     assert r.n_users >= r.n_view >= r.n_click_after_view \
@@ -482,7 +482,7 @@ def test_funnel_is_monotone(spark):
 
 
 def test_retention_day0_equals_cohort_size(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q317_retention_cohorts"](spark, SF).collect()
     from collections import defaultdict
@@ -497,7 +497,7 @@ def test_retention_day0_equals_cohort_size(spark):
 
 
 def test_venn_cells_partition_universe(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q318_crawl_index_venn"](spark, SF).collect()
     assert sum(r.n for r in out) == 500
@@ -508,7 +508,7 @@ def test_venn_cells_partition_universe(spark):
 
 
 def test_seasonal_outliers_exact_rule(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q319_seasonal_outliers"](spark, SF).collect()
     assert len(out) > 0
@@ -519,7 +519,7 @@ def test_seasonal_outliers_exact_rule(spark):
 
 
 def test_bot_flags_metronomes_only(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q321_bot_regularity"](spark, SF).collect()
     bots = {r.user_id for r in out if r.is_bot == 1}
@@ -527,7 +527,7 @@ def test_bot_flags_metronomes_only(spark):
 
 
 def test_entity_resolution_finds_typos(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q322_entity_resolution"](spark, SF).collect()
     true_pairs = [r for r in out if r.is_true_pair == 1]
@@ -542,7 +542,7 @@ def test_entity_resolution_finds_typos(spark):
 
 
 def test_template_detection_targets_hosts(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.host: r for r in
            Q.QUERIES["q323_host_template_detection"](spark, SF).collect()}
@@ -551,7 +551,7 @@ def test_template_detection_targets_hosts(spark):
 
 
 def test_readability_both_branches(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q320_readability_gate"](spark, SF).collect()
     assert len(out) == 500
@@ -559,7 +559,7 @@ def test_readability_both_branches(spark):
 
 
 def test_markov_rows_are_distributions(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q324_markov_transitions"](spark, SF).collect()
     from collections import defaultdict
@@ -573,7 +573,7 @@ def test_markov_rows_are_distributions(spark):
 
 
 def test_covisitation_rec_is_argmax(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q325_covisitation_recs"](spark, SF).collect()
     assert len(out) > 0
@@ -585,7 +585,7 @@ def test_covisitation_rec_is_argmax(spark):
 
 
 def test_spearman_in_range_and_exact(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     r = Q.QUERIES["q326_centrality_rank_correlation"](spark, SF).collect()[0]
     assert r.n == 40
@@ -595,7 +595,7 @@ def test_spearman_in_range_and_exact(spark):
 
 
 def test_autocomplete_prefix_consistency(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q327_autocomplete_prefixes"](spark, SF).collect()
     assert len(out) > 0
@@ -606,10 +606,11 @@ def test_autocomplete_prefix_consistency(spark):
 
 
 def test_streaming_cms_equals_batch(spark):
+    import parity_queries as P
     from gdal_spark import queries as Q
 
     batch = {r.word: r for r in
-             Q.QUERIES["q278_countmin_sketch"](spark, SF).collect()}
+             P.QUERIES["q278_countmin_sketch"](spark, SF).collect()}
     stream = {r.word: r for r in
               Q.QUERIES["q328_streaming_countmin"](spark, SF).collect()}
     assert batch.keys() == stream.keys()
@@ -619,7 +620,7 @@ def test_streaming_cms_equals_batch(spark):
 
 
 def test_snapshot_diff_partitions(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q329_crawl_snapshot_diff"](spark, SF).collect()
     tot = sum(r.n_removed + r.n_added + r.n_changed + r.n_unchanged
@@ -630,7 +631,7 @@ def test_snapshot_diff_partitions(spark):
 
 
 def test_cache_hits_monotone_in_k(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.cache_k: r for r in
            Q.QUERIES["q330_cache_admission_planning"](spark, SF).collect()}
@@ -642,7 +643,7 @@ def test_cache_hits_monotone_in_k(spark):
 
 
 def test_local_bridges_bounded(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q331_local_bridges"](spark, SF).collect()
     assert len(out) > 0
@@ -654,7 +655,7 @@ def test_local_bridges_bounded(spark):
 
 
 def test_cluster_health_outlier_rule(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q332_cluster_health"](spark, SF).collect()
     assert len(out) == 10  # labels 0..9
@@ -668,7 +669,7 @@ def test_cluster_health_outlier_rule(spark):
 
 
 def test_passage_dedup_finds_planted(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q333_passage_dedup"](spark, SF).collect()
     assert len(out) > 0
@@ -681,7 +682,7 @@ def test_passage_dedup_finds_planted(spark):
 
 
 def test_attribution_counts_bounded(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
     from gdal_spark.queries import _t
 
     out = Q.QUERIES["q334_last_touch_attribution"](spark, SF).collect()
@@ -691,7 +692,7 @@ def test_attribution_counts_bounded(spark):
 
 
 def test_sliding_window_at_least_daily(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.window_end: r.n_active_3d for r in
            Q.QUERIES["q335_sliding_distinct_users"](spark, SF).collect()}
@@ -705,7 +706,7 @@ def test_sliding_window_at_least_daily(spark):
 
 
 def test_time_to_convert_buckets(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q336_time_to_convert"](spark, SF).collect()
     assert len(out) > 0
@@ -715,7 +716,7 @@ def test_time_to_convert_buckets(spark):
 
 
 def test_heaps_growth_is_monotone(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.n_docs: r.vocab_size for r in
            Q.QUERIES["q337_heaps_vocab_growth"](spark, SF).collect()}
@@ -727,7 +728,7 @@ def test_heaps_growth_is_monotone(spark):
 
 
 def test_zipf_ranks_are_total_order(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q338_zipf_products"](spark, SF).collect()
     assert sorted(r.rnk for r in out) == list(range(1, 21))
@@ -737,7 +738,7 @@ def test_zipf_ranks_are_total_order(spark):
 
 
 def test_oov_curve_monotone(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.vocab_k: r for r in
            Q.QUERIES["q339_vocab_oov_tradeoff"](spark, SF).collect()}
@@ -750,7 +751,7 @@ def test_oov_curve_monotone(spark):
 
 
 def test_language_geography_consistency(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q340_language_geography"](spark, SF).collect()
     assert sum(r.n_docs for r in out) == 500
@@ -761,7 +762,7 @@ def test_language_geography_consistency(spark):
 
 
 def test_host_geo_flags(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q341_host_geo_concentration"](spark, SF).collect()
     assert len(out) == 40
@@ -773,7 +774,7 @@ def test_host_geo_flags(spark):
 
 
 def test_geofence_counts_nested(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q342_geofence_compliance"](spark, SF).collect()
     assert sum(r.n_docs for r in out) == 500
@@ -784,7 +785,7 @@ def test_geofence_counts_nested(spark):
 
 
 def test_sparse_neighbor_symmetric_dots(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q343_sparse_tfidf_neighbor"](spark, SF).collect()
     assert len(out) == 500  # every doc finds a neighbor (shared vocab)
@@ -794,7 +795,7 @@ def test_sparse_neighbor_symmetric_dots(spark):
 
 
 def test_index_maintenance_bounded(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q344_index_maintenance_cost"](spark, SF).collect()
     assert len(out) == 31
@@ -805,7 +806,7 @@ def test_index_maintenance_bounded(spark):
 
 
 def test_proximity_winner_has_best_span(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q345_term_proximity"](spark, SF).collect()
     assert len(out) == 3
@@ -815,7 +816,7 @@ def test_proximity_winner_has_best_span(spark):
 
 
 def test_topic_tagging_covers_docs(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q346_topic_tagging"](spark, SF).collect()
     # every doc should hit the 12-word lexicon (vocab is 31 words)
@@ -826,7 +827,7 @@ def test_topic_tagging_covers_docs(spark):
 
 
 def test_wilson_bound_sane(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q347_ab_wilson_bounds"](spark, SF).collect()
     assert {r.arm for r in out} == {0, 1}
@@ -836,7 +837,7 @@ def test_wilson_bound_sane(spark):
 
 
 def test_crawl_yield_bounds(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q349_crawl_yield"](spark, SF).collect()
     assert len(out) == 20
@@ -847,7 +848,7 @@ def test_crawl_yield_bounds(spark):
 
 
 def test_recrawl_budget_sums_to_k(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q350_recrawl_budget"](spark, SF).collect()
     assert {r.revisit_weight for r in out} == {1, 2, 4}
@@ -872,7 +873,7 @@ def test_image_hamming_tiers_present(spark):
 
 
 def test_tiering_rules_exact(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q352_storage_tiering"](spark, SF).collect()
     assert len(out) == 100
@@ -883,7 +884,7 @@ def test_tiering_rules_exact(spark):
 
 
 def test_modularity_cells_consistent(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q353_modularity"](spark, SF).collect()
     assert len(out) == 4
@@ -900,7 +901,7 @@ def test_modularity_cells_consistent(spark):
 
 
 def test_cooccurrence_weights_bounded(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q354_glove_cooccurrence"](spark, SF).collect()
     assert len(out) > 0
@@ -911,7 +912,7 @@ def test_cooccurrence_weights_bounded(spark):
 
 
 def test_negative_sampling_table_exact(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q355_negative_sampling_table"](spark, SF).collect()
     assert len(out) == 31
@@ -926,7 +927,7 @@ def test_negative_sampling_table_exact(spark):
 
 
 def test_epoch_orders_differ(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q356_epoch_shuffle"](spark, SF).collect()
     e0 = [r.doc_id for r in sorted(out, key=lambda r: r.pos)
@@ -938,7 +939,7 @@ def test_epoch_orders_differ(spark):
 
 
 def test_dedup_matrix_partial_cells(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q357_dedup_decision_matrix"](spark, SF).collect()
     cells = {(r.dup_exact, r.dup_normalized, r.dup_prefix): r.n
@@ -958,7 +959,7 @@ def test_dedup_matrix_partial_cells(spark):
 
 
 def test_license_inheritance(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q358_license_propagation"](spark, SF).collect()
     assert len(out) > 0
@@ -970,7 +971,7 @@ def test_license_inheritance(spark):
 
 
 def test_redirect_loops_flagged(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q359_redirect_resolution"](spark, SF).collect()
     loops = {r.src for r in out if r.in_loop == 1}
@@ -1010,7 +1011,7 @@ def test_redirect_loops_flagged(spark):
 
 
 def test_hreflang_breaks_localized(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q360_hreflang_symmetry"](spark, SF).collect()
     tot_break = sum(r.n_broken for r in out)
@@ -1021,7 +1022,7 @@ def test_hreflang_breaks_localized(spark):
 
 
 def test_shard_merge_always_consistent(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q361_index_shard_merge"](spark, SF).collect()
     assert len(out) == 31
@@ -1031,7 +1032,7 @@ def test_shard_merge_always_consistent(spark):
 
 
 def test_highlight_offsets_are_exact(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
     from gdal_spark.queries import _t
 
     out = Q.QUERIES["q362_highlight_offsets"](spark, SF).collect()
@@ -1043,7 +1044,7 @@ def test_highlight_offsets_are_exact(spark):
 
 
 def test_weak_supervision_vote_levels(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.votes: r for r in
            Q.QUERIES["q363_weak_supervision_vote"](spark, SF).collect()}
@@ -1056,7 +1057,7 @@ def test_weak_supervision_vote_levels(spark):
 
 
 def test_release_pipeline_monotone(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q364_release_pipeline"](spark, SF).collect()
     assert len(out) == 20
@@ -1068,7 +1069,7 @@ def test_release_pipeline_monotone(spark):
 
 
 def test_binary_recall_bounds(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q365_binary_embedding_recall"](spark, SF).collect()
     assert len(out) == 50
@@ -1077,7 +1078,7 @@ def test_binary_recall_bounds(spark):
 
 
 def test_skew_report_flags_words(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = {r.key_family: r for r in
            Q.QUERIES["q366_skew_report"](spark, SF).collect()}
@@ -1093,7 +1094,7 @@ def test_skew_report_flags_words(spark):
 
 
 def test_effective_tokens_partition(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q367_effective_tokens"](spark, SF).collect()
     assert len(out) == 20
@@ -1103,7 +1104,7 @@ def test_effective_tokens_partition(spark):
 
 
 def test_splits_never_straddle_groups(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q368_leakage_safe_splits"](spark, SF).collect()
     assert {r.split for r in out} <= {"train", "val", "test"}
@@ -1114,7 +1115,7 @@ def test_splits_never_straddle_groups(spark):
 
 
 def test_dwell_buckets_valid(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = Q.QUERIES["q369_view_dwell_time"](spark, SF).collect()
     assert len(out) > 0
@@ -1124,7 +1125,7 @@ def test_dwell_buckets_valid(spark):
 
 
 def test_term_partitions_cover_lexicon(spark):
-    from gdal_spark import queries as Q
+    import parity_queries as Q
 
     out = sorted(Q.QUERIES["q370_term_range_partitions"](spark, SF)
                  .collect(), key=lambda r: r.part)

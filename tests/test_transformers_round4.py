@@ -5,7 +5,7 @@ denominator safety."""
 
 import numpy as np
 
-from gdal_spark.queries import (
+from parity_queries import (
     _HOM_DST,
     _HOM_SRC,
     _PHS_GCPS,
