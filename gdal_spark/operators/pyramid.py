@@ -220,6 +220,23 @@ def pyramid_convolution(
     return strips.groupBy("tx", "ty").applyInPandas(per_tile, out_schema)
 
 
+def parent_tile(
+    children, ptx: int, pty: int, method: str, dtype: str, tile_size: int
+) -> np.ndarray:
+    """One parent tile from its ≤ 4 children ``(tx, ty, arr)``: each
+    child's 2×2-reduced block goes into its quadrant of a zero tile,
+    then the result is cast to ``dtype``.  An integer ``sum`` that
+    overflows the tile dtype wraps when its block is assigned."""
+    out_dtype = np.float64 if method == "average" else np.dtype(dtype)
+    out = np.zeros((tile_size, tile_size), dtype=out_dtype)
+    h = tile_size // 2
+    for tx, ty, child in children:
+        oy = (ty - 2 * pty) * h
+        ox = (tx - 2 * ptx) * h
+        out[oy : oy + h, ox : ox + h] = _reduce2x2(child, method)
+    return out.astype(np.dtype(dtype))
+
+
 def pyramid_level(
     tiles: DataFrame,
     method: str = "sum",
@@ -229,6 +246,8 @@ def pyramid_level(
 
     ``sum`` is the density-pyramid reduction (counts stay counts);
     ``average`` matches the reference's AVERAGE overview semantics.
+    The point-density pipeline builds its SUM levels inside the burn
+    (``rasterize_points(..., min_z)``) with the same ``parent_tile``.
     """
 
     parent = tiles.withColumn("ptx", F.col("tx") / 2).withColumn(
@@ -242,40 +261,25 @@ def pyramid_level(
         ptx, pty = int(key[0]), int(key[1])
         z = int(pdf["z"].iloc[0]) - 1
         dtype = pdf["dtype"].iloc[0]
-        out_dtype = np.float64 if method == "average" else np.dtype(dtype)
-        out = np.zeros((tile_size, tile_size), dtype=out_dtype)
-        for _, row in pdf.iterrows():
-            child = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(
-                tile_size, tile_size
+        children = [
+            (
+                int(tx),
+                int(ty),
+                np.frombuffer(data, dtype=np.dtype(dt)).reshape(tile_size, tile_size),
             )
-            red = _reduce2x2(child, method)
-            oy = (int(row["ty"]) - 2 * pty) * (tile_size // 2)
-            ox = (int(row["tx"]) - 2 * ptx) * (tile_size // 2)
-            out[oy : oy + tile_size // 2, ox : ox + tile_size // 2] = red
+            for tx, ty, data, dt in zip(pdf["tx"], pdf["ty"], pdf["data"], pdf["dtype"])
+        ]
+        out = parent_tile(children, ptx, pty, method, dtype, tile_size)
         return pd.DataFrame(
             {
                 "z": [z],
                 "tx": [ptx],
                 "ty": [pty],
                 "band": [int(pdf["band"].iloc[0])],
-                "data": [out.astype(np.dtype(dtype)).tobytes()],
+                "data": [out.tobytes()],
                 "dtype": [dtype],
                 "nodata": [float(pdf["nodata"].iloc[0])],
             }
         )
 
     return parent.groupBy("ptx", "pty").applyInPandas(reduce_children, TILE_SCHEMA)
-
-
-def build_pyramid(tiles: DataFrame, min_z: int, base_z: int, method: str = "sum"):
-    """All levels base_z-1 .. min_z; returns dict z → DataFrame.
-
-    Callers persist each level before reducing the next (lineage
-    checkpoint), so a killed job resumes from the last written level.
-    """
-    levels = {}
-    cur = tiles
-    for z in range(base_z - 1, min_z - 1, -1):
-        cur = pyramid_level(cur, method)
-        levels[z] = cur
-    return levels

@@ -17,7 +17,9 @@ gcore/gdal_rasterband.h:149-150):
 Two entry points:
 - ``rasterize_points``  — value/count burn of a point DataFrame
   (the web-density tile case: a JVM per-pixel aggregate with map-side
-  partial combine, then one dense tile assembled per tile key)
+  partial combine, then one dense tile assembled per tile key, or,
+  with ``min_z``, the tiles and their SUM overview levels assembled
+  per ancestor tile)
 - ``rasterize_features`` — polygon/line burn via applyInPandas per
   tile with the exact scanline/Bresenham kernels
 """
@@ -90,6 +92,23 @@ def with_tile(
     ).drop("_t")
 
 
+# Overview levels one ``rasterize_points`` call fuses into its burn.
+# The fused plan groups pixel rows by their tiles' ``min_z`` ancestor,
+# so one group holds up to 4**levels base tiles: at 3 levels, at most
+# 64 tiles, 64·tile_size² sparse pixel rows into one Python call and
+# 16 MB of dense int32 tiles (256²) in its memory.  A 4th level would
+# make that 256 tiles and 64 MB, and cut the groups that assemble in
+# parallel 4× again: at base z8 there are at most 1024 z5 groups
+# against up to 65,536 z8 tile keys.  Measured on the pipeline's pages
+# (250k and 1M), the points occupy 19 z5 ancestors over 44 z8 tiles,
+# at most 4 base tiles each, and the 12 hottest ancestors hold 82-88%
+# of the pixel rows; so the assemble runs at most 19 tasks here (44
+# without ``min_z``).  The pixel aggregate below the grouping stays
+# fully parallel.  Coarser levels chain ``pyramid.pyramid_level``
+# stages over the coarsest fused one.
+MAX_FUSED_LEVELS = 3
+
+
 def rasterize_points(
     points: DataFrame,
     z: int,
@@ -98,8 +117,10 @@ def rasterize_points(
     value: str | None = None,
     dtype: str = "int32",
     tile_size: int = TILE_SIZE,
+    min_z: int | None = None,
 ) -> DataFrame:
-    """Point-density (or value-sum) tiles at zoom z.
+    """Point-density (or value-sum) tiles at zoom z, plus their SUM
+    overview levels z-1 .. ``min_z`` when ``min_z < z``.
 
     Plan: encode → JVM pixel aggregate → assemble one tile per key.
     ``with_tile`` gives each point its (tx, ty, pix); a JVM
@@ -115,31 +136,77 @@ def rasterize_points(
     ``copy_word`` like the single-phase ``burn_points(merge_add=True)``,
     a value burn through ``astype(dtype)``.  Value sums are exact, and
     so independent of Spark's summation order, whenever the partial
-    sums are representable (e.g. dyadic weights)."""
+    sums are representable (e.g. dyadic weights).
+
+    With ``min_z < z`` (at most ``MAX_FUSED_LEVELS`` below z) the second
+    exchange is on the tiles' ``min_z`` ancestor (atx, aty) instead, and
+    one ``applyInPandas`` call per ancestor assembles each of its base
+    tiles as above, then reduces them level by level with
+    ``pyramid.parent_tile(method="sum")`` — the GDALRegenerateOverviews
+    SUM of 2×2 child blocks (gcore/overview.cpp:4302-4774).  Every level
+    is byte-identical to chaining ``pyramid_level(method="sum")`` over
+    the z tiles, and the result holds the rows of every level, told
+    apart by ``z``.  ``min_z == z`` is the plain burn."""
+    min_z = z if min_z is None else min_z
+    if not z - MAX_FUSED_LEVELS <= min_z <= z:
+        raise ValueError(
+            f"min_z={min_z} must lie in [z - {MAX_FUSED_LEVELS}, z] for z={z}; "
+            "chain pyramid_level for coarser levels"
+        )
     pts = with_tile(points, z, lon, lat, tile_size)
     agg = F.count(F.lit(1)) if value is None else F.sum(F.col(value).cast("double"))
     pixels = pts.groupBy("tx", "ty", "pix").agg(agg.alias("v"))
     dt = np.dtype(dtype)
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pix = pdf["pix"].to_numpy()
+    def burn(pix: np.ndarray, v: np.ndarray) -> np.ndarray:
         m = pix >= 0
         acc = np.zeros(tile_size * tile_size, dtype=np.float64)
-        acc[pix[m]] += pdf["v"].to_numpy(np.float64)[m]
-        arr = copy_word(acc, dt) if value is None else acc.astype(dt)
+        acc[pix[m]] += v[m]
+        return copy_word(acc, dt) if value is None else acc.astype(dt)
+
+    def rows(tiles: list[tuple[int, int, int, np.ndarray]]) -> pd.DataFrame:
         return pd.DataFrame(
             {
-                "z": [z],
-                "tx": [int(key[0])],
-                "ty": [int(key[1])],
-                "band": [1],
-                "data": [arr.tobytes()],
-                "dtype": [dtype],
-                "nodata": [0.0],
+                "z": [t[0] for t in tiles],
+                "tx": [t[1] for t in tiles],
+                "ty": [t[2] for t in tiles],
+                "band": 1,
+                "data": [t[3].tobytes() for t in tiles],
+                "dtype": dtype,
+                "nodata": 0.0,
             }
         )
 
-    return pixels.groupBy("tx", "ty").applyInPandas(assemble, TILE_SCHEMA)
+    # pyramid imports TILE_SCHEMA from this module
+    from gdal_spark.operators.pyramid import parent_tile
+
+    shift = z - min_z
+
+    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        pix = pdf["pix"].to_numpy()
+        v = pdf["v"].to_numpy(np.float64)
+        level = {
+            (int(tx), int(ty)): burn(pix[idx], v[idx]).reshape(tile_size, tile_size)
+            for (tx, ty), idx in pdf.groupby(["tx", "ty"]).indices.items()
+        }
+        out = [(z, tx, ty, arr) for (tx, ty), arr in level.items()]
+        for lz in range(z - 1, min_z - 1, -1):
+            children: dict[tuple[int, int], list] = {}
+            for (tx, ty), arr in level.items():
+                children.setdefault((tx >> 1, ty >> 1), []).append((tx, ty, arr))
+            level = {
+                (ptx, pty): parent_tile(ch, ptx, pty, "sum", dtype, tile_size)
+                for (ptx, pty), ch in children.items()
+            }
+            out += [(lz, tx, ty, arr) for (tx, ty), arr in level.items()]
+        return rows(out)
+
+    keys = (
+        ["tx", "ty"]
+        if shift == 0
+        else [F.shiftright("tx", shift).alias("atx"), F.shiftright("ty", shift).alias("aty")]
+    )
+    return pixels.groupBy(*keys).applyInPandas(assemble, TILE_SCHEMA)
 
 
 def rasterize_features(

@@ -18,6 +18,9 @@ stages):
   rename, so a row in the manifest IS the completion marker.
 - Spark writes each partition as one file; per-file rows/bytes from
   the parquet footers are recorded as the per-partition metrics.
+- One write may commit several stages (``run_stage(parts=...)``: a
+  tile burn and its overview levels): one rename, then one row per
+  level, each pointing at its own directory of the written table.
 """
 
 from __future__ import annotations
@@ -99,37 +102,58 @@ class Manifest:
         stage: str,
         fp_parts: list,
         build: "callable",
-        partition_by: list[str] | None = None,
-    ) -> StageResult:
+        parts: dict[str, int] | None = None,
+    ) -> "StageResult | dict[str, StageResult]":
         """Execute-or-resume.  ``build()`` returns the stage DataFrame;
         it only runs when no completed manifest row matches the
-        fingerprint."""
+        fingerprint.
+
+        ``parts`` ({row name: zoom}) commits one tile-table write as
+        several stages, one per pyramid level: the output is
+        partitioned on a copy of ``z`` (``z_part=<z>``, so the files
+        keep ``z`` itself), renamed once, and then gets one manifest
+        row per level, whose path is that level's directory and whose
+        wall time is the shared write's.  The stage resumes only when
+        every level's row matches and its directory exists; otherwise
+        the whole write is redone.  Returns {row name: StageResult}."""
         fp = fingerprint([stage] + fp_parts)
         out_path = os.path.join(self.root, f"{stage}_{fp}")
-        hit = self.lookup(stage, fp)
-        if hit is not None:
-            return StageResult(
-                stage, fp, hit["path"], hit["rows"], hit["bytes"], hit["n_files"],
-                0.0, resumed=True,
-            )
+        dirs = {stage: out_path} if parts is None else {
+            name: os.path.join(out_path, f"z_part={z}") for name, z in parts.items()
+        }
+        hits = {name: self.lookup(name, fp) for name in dirs}
+        if all(hit is not None for hit in hits.values()):
+            done = {
+                name: StageResult(
+                    name, fp, hit["path"], hit["rows"], hit["bytes"], hit["n_files"],
+                    0.0, resumed=True,
+                )
+                for name, hit in hits.items()
+            }
+            return done if parts is not None else done[stage]
         t0 = time.time()
         tmp = os.path.join(self.root, f"_tmp_{stage}_{fp}")
         shutil.rmtree(tmp, ignore_errors=True)
         df = build()
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
+        if parts is None:
+            w = df.write
+        else:
+            w = df.withColumn("z_part", df["z"]).write.partitionBy("z_part")
+        w.mode("overwrite").parquet(tmp)
+        for z in (parts or {}).values():  # a level with no rows gets no directory
+            os.makedirs(os.path.join(tmp, f"z_part={z}"), exist_ok=True)
         shutil.rmtree(out_path, ignore_errors=True)
         os.rename(tmp, out_path)
-        parts = self._scan_parts(out_path)
-        rows = sum(p["rows"] for p in parts)
-        nbytes = sum(p["bytes"] for p in parts)
-        res = StageResult(
-            stage, fp, out_path, rows, nbytes, len(parts), time.time() - t0, False
-        )
-        self.record(res, parts)
-        return res
+        wall = time.time() - t0
+        done = {}
+        for name, path in dirs.items():
+            found = self._scan_parts(path)
+            done[name] = StageResult(
+                name, fp, path, sum(p["rows"] for p in found),
+                sum(p["bytes"] for p in found), len(found), wall, False,
+            )
+            self.record(done[name], found)
+        return done if parts is not None else done[stage]
 
     # --- snapshot history / time travel (the Iceberg read semantics the
     # manifest stands in for: every committed stage attempt is a

@@ -1,23 +1,30 @@
 """The flagship pages pipeline (north rule, end to end):
 
   synth pages → geocode (lon/lat) → cell index (res 7-9 + hilbert)
-  → spatial join vs zone polygons (salted, two-phase)
-  → web-density tile burn (z base) → pyramid rollup
+  → spatial join vs zone polygons (broadcast cover)
+  → web-density tile burn (z base) + SUM pyramid to z base-3, one job
+  → any coarser pyramid levels, one stage each
   every stage manifest-checkpointed (resume = skip completed stages)
 
-Scale notes (what changes at 10^12 rows on 1000 executors — nothing
-structural):
+Scale notes (what changes at 10^12 rows on 1000 executors):
 - stage boundaries are parquet/Iceberg tables partitioned on the next
   stage's key (cells for the join, z/tx for tiles), so each stage
   starts from a co-partitioned scan instead of a shuffle;
 - the polygon side is broadcast (cover-set rows, not geometry blobs ×
-  points);
-- the only big-data shuffles are the tile burn's and the pyramid
-  rollups' (4× smaller per level).  The burn shuffles per-pixel
+  points), so the join has no shuffle and no salting;
+- the only big-data shuffle is the tile burn's.  It shuffles per-pixel
   partial counts, combined map-side, on (tx, ty, pix), then at most
-  one row per occupied pixel on (tx, ty): the hot metro tiles cost
-  at most tile_size² rows per map task, not their point count;
-- hot metro cells are pre-salted (salt_factor) *and* AQE skew-split.
+  one row per occupied pixel on the tiles' z base-3 ancestor: the hot
+  metro tiles cost at most tile_size² rows per map task, not their
+  point count, and one Python call per ancestor writes its base tiles
+  and their three overview levels (``rasterize_points(min_z=...)``).
+- that last step does not widen with the cluster: it runs one task per
+  occupied ancestor.  The metro zones occupy 19 z5 ancestors (44 z8
+  tiles) at both 250k and 1M pages, and the 12 hottest hold 82-88% of
+  the pixel rows, so at most 19 executors assemble tiles.  Its input
+  is bounded by the pixel count (64·tile_size² rows per ancestor), not
+  the page count, so it is a fixed cost per job, while the encode and
+  pixel aggregate below it scale with the executors.
 """
 
 from __future__ import annotations
@@ -28,7 +35,7 @@ from pyspark.sql import functions as F
 
 from gdal_spark.kernels import wkb as W
 from gdal_spark.operators.pyramid import pyramid_level
-from gdal_spark.operators.rasterize import rasterize_points
+from gdal_spark.operators.rasterize import MAX_FUSED_LEVELS, rasterize_points
 from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons, with_cell
 from gdal_spark.plans.manifest import Manifest
 from gdal_spark.sources.pages import CITIES, geocode, geocode_encode, synth_pages
@@ -57,9 +64,13 @@ def run_pipeline(
     base_z: int = 8,
     min_z: int = 5,
     partitions: int = 32,
-    salt_factor: int = 4,
 ) -> dict:
-    """Returns {stage: StageResult}; rerun with the same args resumes."""
+    """Returns {stage: StageResult}; rerun with the same args resumes.
+
+    The ``tiles`` stage writes the base_z tiles and the pyramid levels
+    down to base_z - ``MAX_FUSED_LEVELS`` in one job, committed as one
+    manifest row per level (``tiles``, ``pyramid_z{z}``, ...); each
+    level below that is its own ``pyramid_level`` stage."""
     mf = Manifest(root)
     results = {}
 
@@ -93,24 +104,26 @@ def run_pipeline(
         return spatial_join_points_in_polygons(
             geo.select("page_id", "lon", "lat"),
             metro_zones(),
-            salt_factor=salt_factor,
             poly_id_col="zone_id",
         )
 
-    res_join = mf.run_stage(
-        spark, "zone_join", [res_geo.fp, salt_factor], join_build
-    )
+    res_join = mf.run_stage(spark, "zone_join", [res_geo.fp], join_build)
     results["zone_join"] = res_join
+
+    fused_z = max(min_z, base_z - MAX_FUSED_LEVELS)
 
     def tiles_build():
         geo = spark.read.parquet(res_geo.path)
-        return rasterize_points(geo, z=base_z)
+        return rasterize_points(geo, z=base_z, min_z=fused_z)
 
-    res_tiles = mf.run_stage(spark, "tiles", [res_geo.fp, base_z], tiles_build)
-    results["tiles"] = res_tiles
+    levels = {"tiles": base_z}
+    levels.update({f"pyramid_z{z}": z for z in range(base_z - 1, fused_z - 1, -1)})
+    results.update(
+        mf.run_stage(spark, "tiles", [res_geo.fp, base_z, fused_z], tiles_build, parts=levels)
+    )
 
-    prev = res_tiles
-    for z in range(base_z - 1, min_z - 1, -1):
+    prev = results[list(levels)[-1]]  # the coarsest fused level
+    for z in range(fused_z - 1, min_z - 1, -1):
 
         def level_build(prev_path=prev.path):
             return pyramid_level(spark.read.parquet(prev_path), method="sum")

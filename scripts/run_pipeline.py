@@ -22,7 +22,6 @@ def main() -> None:
 
     spark = SparkSession.builder.appName("gdal-spark-pipeline").getOrCreate()
 
-    from gdal_spark.operators.pyramid import pyramid_level
     from gdal_spark.operators.rasterize import rasterize_points
     from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
     from gdal_spark.plans.pipeline import metro_zones
@@ -34,12 +33,11 @@ def main() -> None:
     n_joined = spatial_join_points_in_polygons(
         geo, metro_zones(), poly_id_col="zone_id"
     ).count()
-    tiles = rasterize_points(geo, z=8)
-    tiles.write.mode("overwrite").parquet(args.out + "_tiles_z8")
-    prev = spark.read.parquet(args.out + "_tiles_z8")
-    for _ in range(3):
-        prev = pyramid_level(prev, method="sum")
-    n_tiles = prev.count()
+    # z8 tiles and the SUM pyramid z7..z5 in one job
+    rasterize_points(geo, z=8, min_z=5).write.mode("overwrite").parquet(
+        args.out + "_tiles"
+    )
+    n_tiles = spark.read.parquet(args.out + "_tiles").filter("z = 5").count()
     print(json.dumps({
         "pages": args.pages, "joined": int(n_joined),
         "tiles_z5": int(n_tiles), "wall_s": round(time.time() - t0, 2),

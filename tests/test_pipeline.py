@@ -62,6 +62,47 @@ def test_pipeline_resume_after_kill(spark, pipe):
     assert again["tiles"].bytes == victim.bytes
 
 
+def _tile_sum(path: str) -> int:
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["data", "dtype"]).to_pydict()
+    return int(sum(np.frombuffer(d, dtype=np.dtype(k)).sum()
+                   for d, k in zip(t["data"], t["dtype"])))
+
+
+def test_pipeline_resume_after_level_loss(spark, pipe):
+    """Losing one fused pyramid level rebuilds the whole tiles stage
+    (every level is one write) and nothing upstream of it."""
+    root, first = pipe
+    shutil.rmtree(first["pyramid_z7"].path)
+    again = run_pipeline(spark, N_PAGES, root, base_z=8, min_z=6, partitions=8)
+    assert again["pages"].resumed and again["geocode"].resumed
+    assert again["zone_join"].resumed
+    for name in ("tiles", "pyramid_z7", "pyramid_z6"):
+        assert not again[name].resumed, name
+        assert again[name].path == first[name].path
+        assert again[name].rows == first[name].rows, name
+        assert again[name].bytes == first[name].bytes, name
+
+
+def test_pipeline_levels_beyond_fused_cap(spark, tmp_path):
+    """base_z - min_z = 4: the tiles stage fuses z7..z5 and z4 is one
+    chained pyramid_level stage over z5; every level sums to the page
+    count and reads back with the full tile schema."""
+    root = str(tmp_path / "pipe4")
+    res = run_pipeline(spark, N_PAGES, root, base_z=8, min_z=4, partitions=8)
+    levels = ["tiles", "pyramid_z7", "pyramid_z6", "pyramid_z5", "pyramid_z4"]
+    assert [k for k in res if k.startswith(("tiles", "pyramid_"))] == levels
+    assert {res[k].fp for k in levels[:4]} == {res["tiles"].fp}
+    assert res["pyramid_z4"].fp != res["tiles"].fp
+    assert os.path.dirname(res["pyramid_z5"].path) == os.path.dirname(res["tiles"].path)
+    for z, name in zip(range(8, 3, -1), levels):
+        assert _tile_sum(res[name].path) == N_PAGES, name
+        df = spark.read.parquet(res[name].path)
+        assert df.columns == ["z", "tx", "ty", "band", "data", "dtype", "nodata"]
+        assert {r.z for r in df.select("z").distinct().collect()} == {z}, name
+
+
 def test_manifest_partition_metrics(pipe):
     root, results = pipe
     with open(os.path.join(root, "manifest.jsonl")) as f:

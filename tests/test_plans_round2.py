@@ -41,6 +41,31 @@ def test_point_burn_pixel_aggregate_plan(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_fused_point_burn_pyramid_plan(spark):
+    """rasterize_points(min_z) burns the base tiles and their overview
+    levels from one pixel aggregate: the pixel exchange, then one
+    exchange on the min_z ancestor, and no per-level shuffles."""
+    from gdal_spark.operators.rasterize import rasterize_points
+    from gdal_spark.sources.pages import geocode_encode, synth_pages
+
+    geo = geocode_encode(synth_pages(spark, 2000, 4), res_list=(7,))
+    plan = plan_of(rasterize_points(geo, z=8, min_z=5))
+    lines = plan.splitlines()
+    tile_ex = []
+    for i, ln in enumerate(lines):
+        m = re.search(r"Exchange hashpartitioning\(([^)]*)\)", ln)
+        if m and "tx" in m.group(1):
+            keys = re.sub(r"#\d+L?", "", m.group(1)).split(", ")[:-1]
+            tile_ex.append((i, keys))
+    assert [keys for _, keys in tile_ex] == [["atx", "aty"], ["tx", "ty", "pix"]]
+    pix_ex = tile_ex[1][0]
+    assert "HashAggregate" in lines[pix_ex + 1]
+    assert "partial_count" in lines[pix_ex + 1]
+    # the with_tile encode and the one per-ancestor assemble
+    assert len(re.findall(r"ArrowEvalPython|FlatMapGroupsInPandas", plan)) == 2
+    assert "FlatMapGroupsInPandas [atx" in plan
+
+
 def test_pansharpen_join_is_equi(spark):
     from gdal_spark.operators.pansharpen import pansharpen_tiles
     from gdal_spark.session import local_df
