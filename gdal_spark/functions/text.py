@@ -64,12 +64,6 @@ def punct_ratio(col) -> Column:
     return F.when(n > 0, (n - removed) / n).otherwise(F.lit(0.0))
 
 
-def whitespace_ratio(col) -> Column:
-    n = F.length(col)
-    removed = F.length(F.regexp_replace(col, " ", ""))
-    return F.when(n > 0, (n - removed) / n).otherwise(F.lit(0.0))
-
-
 def mean_token_len(col) -> Column:
     tc = token_count(col)
     nonspace = F.length(F.regexp_replace(col, " ", ""))
@@ -85,18 +79,6 @@ def stopword_count(col, words: list[str]) -> Column:
 def stopword_ratio(col, words: list[str]) -> Column:
     tc = token_count(col)
     return F.when(tc > 0, stopword_count(col, words) / tc).otherwise(F.lit(0.0))
-
-
-def quality_score(col) -> Column:
-    """Deterministic length/stopword/token-shape quality heuristic in
-    [0, 1]: the shape of a training-data quality filter (length band,
-    mean token length band, stopword presence)."""
-    tc = token_count(col).cast("double")
-    mtl = mean_token_len(col)
-    stop = stopword_ratio(col, LANG_MARKERS["en"])
-    len_ok = F.when((tc >= 5) & (tc <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
-    mtl_ok = F.when((mtl >= 2.0) & (mtl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
-    return F.round(0.4 * len_ok + 0.3 * mtl_ok + 0.3 * F.least(stop * 5, F.lit(1.0)), 6)
 
 
 def lang_guess(col) -> Column:

@@ -15,8 +15,10 @@ oracle drive it with synthetic dyadic-exact grids so the bilinear
 path is value-checked with tolerance zero.
 
 Subgrid selection follows the standard rule: among subgrids whose
-extent contains the point, the DENSEST (smallest cell) wins —
-child grids refine parents.
+extent contains the point, the DENSEST (smallest cell area,
+``lat_inc * long_inc``) wins — child grids refine parents.  A subgrid
+needs at least 2 rows and 2 columns: bilinear interpolation reads a
+2×2 cell, so smaller grids are rejected at parse time.
 """
 
 from __future__ import annotations
@@ -109,7 +111,9 @@ def write_ntv2(subgrids: list[SubGrid]) -> bytes:
 
 
 def parse_ntv2(blob: bytes) -> list[SubGrid]:
-    """Parse an NTv2 blob (both endiannesses; GS_TYPE SECONDS)."""
+    """Parse an NTv2 blob (both endiannesses; GS_TYPE SECONDS).
+    Raises ValueError on a subgrid under 2×2 nodes or whose GS_COUNT
+    disagrees with its extent."""
     # endianness from NUM_OREC's int32: 11 little-endian or big
     val_le = struct.unpack_from("<i", blob, 8)[0]
     en = "<" if val_le == 11 else ">"
@@ -135,7 +139,14 @@ def parse_ntv2(blob: bytes) -> list[SubGrid]:
         quads = quads.reshape(count, 4)
         nrows = int(round((n_lat - s_lat) / lat_inc)) + 1
         ncols = int(round((w_long - e_long) / long_inc)) + 1
-        assert nrows * ncols == count, (nrows, ncols, count)
+        if nrows < 2 or ncols < 2:
+            raise ValueError(
+                f"subgrid {name!r} is {nrows}x{ncols} nodes; bilinear "
+                "interpolation needs at least 2x2")
+        if nrows * ncols != count:
+            raise ValueError(
+                f"subgrid {name!r}: GS_COUNT {count} != {nrows}x{ncols} "
+                "nodes implied by its extent")
         grids.append(SubGrid(
             name, s_lat, n_lat, e_long, w_long, lat_inc, long_inc,
             quads[:, 0].reshape(nrows, ncols).copy(),
@@ -150,7 +161,8 @@ def _pick(grids: list[SubGrid], lat_sec: float, lonw_sec: float):
     for g in grids:
         if (g.s_lat <= lat_sec <= g.n_lat
                 and g.e_long <= lonw_sec <= g.w_long):
-            if best is None or g.lat_inc < best.lat_inc:
+            if best is None or (g.lat_inc * g.long_inc
+                                < best.lat_inc * best.long_inc):
                 best = g
     return best
 

@@ -267,7 +267,7 @@ def _tag_components(segs: DataFrame, nlev: int = 1) -> DataFrame:
     in ONE CC run — node ids are seg·nlev + lvl, so component ids are
     globally unique across levels.  ``segs`` must carry ``lvl`` when
     nlev > 1 (it is synthesized as 0 otherwise)."""
-    from gdal_spark.operators.graph import connected_components_auto
+    from gdal_spark.operators.graph import connected_components
 
     if "lvl" not in segs.columns:
         segs = segs.withColumn("lvl", F.lit(0))
@@ -285,12 +285,13 @@ def _tag_components(segs: DataFrame, nlev: int = 1) -> DataFrame:
         .select("src", "dst")
     )
     selfloops = segs.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    # Size-gated: a segment graph is a disjoint union of simple paths /
-    # cycles, so the distributed pointer-jump pays O(log ring-length)
-    # rounds of fixed job latency — the worst shape for small inputs.
-    # connected_components_auto union-finds graphs under 200k edges at
-    # the driver and pointer-jumps past that (same min-id components).
-    comp = connected_components_auto(shared.unionByName(selfloops))
+    # A segment graph is a disjoint union of simple paths / cycles, so
+    # the distributed pointer-jump pays O(log ring-length) rounds of
+    # fixed job latency — the worst shape for small inputs.
+    # connected_components' size gate (graph.DRIVER_EDGE_LIMIT)
+    # union-finds graphs that fit at the driver and pointer-jumps past
+    # that (same min-id components).
+    comp = connected_components(shared.unionByName(selfloops))
     return (
         segs.join(comp, "node"),
         ends.withColumnRenamed("node", "seg"),

@@ -8,20 +8,101 @@ each round is one join + one aggregation, and the loop runs O(diameter)
 rounds.  ``localCheckpoint`` truncates the growing lineage each round
 (without it the plan tree doubles per iteration and the driver, not the
 data, becomes the bottleneck at scale).
+
+One size gate serves every operator here (and the polygonize / sieve
+label graphs): ``driver_rows`` collects an edge table of at most
+``DRIVER_EDGE_LIMIT`` rows, and the operator replays its distributed
+round recurrence in driver dicts — the reference's in-memory form,
+milliseconds instead of O(log diameter) rounds of fixed job latency.
+Larger tables run the distributed loops.  Both sides return the same
+schema (typed from the input columns) and the same rows
+(tests/test_size_gates.py).
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gdal_spark.session import local_df
 
+# Edge rows a graph may have and still be solved at the driver.  Read
+# at call time, never bound as a default, so tests force either side
+# with monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 0).
+DRIVER_EDGE_LIMIT = 200_000
+
+
+@contextmanager
+def driver_rows(edges: DataFrame, cols):
+    """The size gate: persist ``edges``, count at most
+    ``DRIVER_EDGE_LIMIT + 1`` rows, and yield the collected ``cols``
+    rows when the table fits the driver, else None.  ``edges`` stays
+    persisted for the block, so a distributed path run inside it reads
+    the cache instead of re-executing the edge lineage."""
+    edges.persist()
+    try:
+        n = edges.limit(DRIVER_EDGE_LIMIT + 1).count()
+        if n > DRIVER_EDGE_LIMIT:
+            yield None
+        else:
+            yield edges.select(*cols).collect() if n else []
+    finally:
+        edges.unpersist()
+
+
+def _union_find(pairs) -> dict:
+    """{node: smallest node id connected to it} over (a, b) pairs — the
+    driver form of min-label connected components (path halving, the
+    larger root links under the smaller)."""
+    parent: dict = {}
+
+    def find(a):
+        parent.setdefault(a, a)
+        root = a
+        while parent[root] != root:
+            root = parent[root]
+        while parent[a] != root:
+            parent[a], a = root, parent[a]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {a: find(a) for a in list(parent)}
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct (u, v) in both directions, typed as the node columns."""
+    return (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        .distinct()
+    )
+
 
 def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 50
 ) -> DataFrame:
-    """(node, component) with component = min node id reachable.
+    """(node, component) with component = min node id reachable, both
+    typed as the node columns.  Size-gated: a graph that fits the
+    driver union-finds there in one pass; larger graphs run the
+    distributed pointer-jumping loop."""
+    with driver_rows(edges, (src, dst)) as rows:
+        if rows is None:
+            return _connected_components(edges, src, dst, max_iter)
+    schema = _undirected(edges, src, dst).select(
+        F.col("u").alias("node"), F.col("u").alias("component")
+    ).schema
+    return local_df(edges.sparkSession, _union_find(rows).items(), schema)
+
+
+def _connected_components(
+    edges: DataFrame, src: str, dst: str, max_iter: int
+) -> DataFrame:
+    """Distributed side of ``connected_components``.
 
     Shuffle shape per round: edges join labels on src (labels are the
     small side until convergence regions grow), then min-aggregate on
@@ -32,12 +113,7 @@ def connected_components(
     # edge list often carries an expensive lineage (e.g. the contour
     # segment self-join) — without this the WHOLE upstream re-executes
     # once per join per round.
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges, src, dst).localCheckpoint()
     labels = (
         und.select(F.col("u").alias("node"))
         .distinct()
@@ -117,12 +193,7 @@ def label_propagation(
     never a window sort over the neighbor table.  Labels must be in
     [0, 999] for the encoding (the planted fixtures are); widen the
     factor for bigger graphs."""
-    und = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges, src, dst).localCheckpoint()
     nodes = und.select(F.col("u").alias("node")).distinct().localCheckpoint()
     labels = nodes.withColumn("lbl", F.col("node"))
     for _ in range(rounds):
@@ -164,16 +235,56 @@ def boruvka_mst(
 ) -> DataFrame:
     """Minimum spanning forest by Borůvka rounds — the single-link
     clustering backbone (dendrogram = MST edges by weight).  Each
-    round every component picks its minimum outgoing edge as a
-    map-side-combinable MIN over struct(w, u, v) — the total order on
-    (w, u, v) breaks weight ties by edge identity, which is exactly
-    the classical condition that keeps tied Borůvka acyclic — then
-    components merge by a connected-components pass over the
-    component graph (pointer jumping, O(log) rounds).  Component
+    round every component picks its minimum outgoing edge under the
+    total order on (w, u, v) — which breaks weight ties by edge
+    identity, exactly the classical condition that keeps tied Borůvka
+    acyclic — then the picked edges merge components.  Component
     count at least halves per round, so rounds <= log2(n).
+
+    Size-gated: a graph that fits the driver replays the round
+    recurrence in dicts; larger graphs run the distributed rounds.
+    The emitted edge SET does not depend on how components are
+    labelled, so both sides return the same forest.
 
     Returns the MST edge set (u, v, w) with u < v; the column types
     are those of the input's node and weight columns."""
+    with driver_rows(edges, (src, dst, w)) as rows:
+        if rows is None:
+            return _boruvka_mst(edges, src, dst, w, max_rounds)
+    e = sorted({(min(a, b), max(a, b), ww) for a, b, ww in rows if a != b})
+    comp = {}
+    for u, v, _w in e:
+        comp[u] = u
+        comp[v] = v
+    mst: set = set()
+    for _ in range(max_rounds):
+        best: dict = {}
+        for u, v, ww in e:
+            cu, cv = comp[u], comp[v]
+            if cu == cv:
+                continue
+            s = (ww, u, v)
+            if cu not in best or s < best[cu]:
+                best[cu] = s
+            if cv not in best or s < best[cv]:
+                best[cv] = s
+        picks = set(best.values())
+        if not picks:
+            break
+        mst |= picks
+        root = _union_find((comp[u], comp[v]) for _w, u, v in picks)
+        comp = {nd: root.get(c, c) for nd, c in comp.items()}
+    return local_df(
+        edges.sparkSession, sorted((u, v, ww) for ww, u, v in mst),
+        _mst_edges(edges, src, dst, w).schema)
+
+
+def _boruvka_mst(
+    edges: DataFrame, src: str, dst: str, w: str, max_rounds: int
+) -> DataFrame:
+    """Distributed side of ``boruvka_mst``: each component's pick is a
+    map-side-combinable MIN over struct(w, u, v), and components merge
+    by a (gated) connected-components pass over the component graph."""
     e = (
         _mst_edges(edges, src, dst, w)
         .filter("u <> v")
@@ -225,67 +336,32 @@ def boruvka_mst(
     return mst
 
 
-def boruvka_mst_auto(
-    edges: DataFrame, src: str = "src", dst: str = "dst", w: str = "w",
-    threshold: int = 200_000, max_rounds: int = 16,
-) -> DataFrame:
-    """Size-gated Borůvka — the ``shortest_paths_auto`` judgment
-    applied to MST: a graph whose edge table fits the driver replays
-    the IDENTICAL round recurrence (per component, min outgoing edge
-    under the (w, u, v) total order; merge; repeat) in local dicts —
-    the emitted edge SET is label-convention-independent, so both
-    paths return the same forest by construction (pinned by
-    tests/test_graph_parity.py).  Larger graphs run the distributed
-    rounds.  Tiny dendrogram fixtures stop paying ~8 s of per-round
-    checkpoint + CC-pass latency."""
-    edges = edges.persist()
-    n = edges.limit(threshold + 1).count()
-    if n > threshold:
-        out = boruvka_mst(edges, src=src, dst=dst, w=w,
-                          max_rounds=max_rounds)
-        edges.unpersist()
-        return out
-    spark = edges.sparkSession
-    raw = [(r[src], r[dst], r[w]) for r in edges.collect()]
-    edges.unpersist()
-    e = sorted({(min(a, b), max(a, b), ww)
-                for a, b, ww in raw if a != b})
-    comp = {}
-    for u, v, _w in e:
-        comp[u] = u
-        comp[v] = v
-    mst: set = set()
-    for _ in range(max_rounds):
-        best: dict = {}
-        for u, v, ww in e:
-            cu, cv = comp[u], comp[v]
-            if cu == cv:
-                continue
-            s = (ww, u, v)
-            if cu not in best or s < best[cu]:
-                best[cu] = s
-            if cv not in best or s < best[cv]:
-                best[cv] = s
-        picks = set(best.values())
-        if not picks:
-            break
-        mst |= picks
-        parent = {c: c for c in set(comp.values())}
+def _weighted(edges: DataFrame, src: str, dst: str, weight: str) -> DataFrame:
+    return edges.select(
+        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
+    )
 
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
 
-        for ww, u, v in picks:
-            a, b = find(comp[u]), find(comp[v])
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        comp = {nd: find(c) for nd, c in comp.items()}
-    return local_df(
-        spark, sorted((u, v, ww) for ww, u, v in mst),
-        _mst_edges(edges, src, dst, w).schema)
+def _relax(e: DataFrame, dist: DataFrame) -> DataFrame:
+    """One Bellman-Ford round: (node, cost, _changed) from the previous
+    (node, cost).  Its analysed schema also types the driver side."""
+    relax = (
+        e.join(dist.withColumnRenamed("node", "u"), "u")
+        .select(F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("cand"))
+        .groupBy("node")
+        .agg(F.min("cand").alias("cand"))
+    )
+    return dist.join(relax, "node", "full").select(
+        "node",
+        F.least(
+            F.coalesce(F.col("cost"), F.col("cand")),
+            F.coalesce(F.col("cand"), F.col("cost")),
+        ).alias("cost"),
+        (
+            F.col("cost").isNull()
+            | (F.coalesce(F.col("cand"), F.col("cost")) < F.col("cost"))
+        ).alias("_changed"),
+    )
 
 
 def shortest_paths(
@@ -297,47 +373,79 @@ def shortest_paths(
     max_iter: int = 100,
 ) -> DataFrame:
     """Single-source shortest paths — the GNM Dijkstra surface
-    (gnm/gnmgraph.h:173) as distributed Bellman-Ford: each round
-    relaxes every edge (join on the frontier + min-combine), and the
-    loop stops at the first round with no improvement.  Rounds =
-    longest shortest-path hop count; ``localCheckpoint`` per round
-    truncates lineage.  Dijkstra's priority queue doesn't distribute;
-    frontier relaxation is the standard cluster form (delta-stepping
-    drops in behind the same signature for weighted speedups).
+    (gnm/gnmgraph.h:173) as Bellman-Ford: each round relaxes every
+    edge from the previous round's costs, and the loop stops at the
+    first round with no improvement.  Dijkstra's priority queue
+    doesn't distribute; frontier relaxation is the standard cluster
+    form (delta-stepping drops in behind the same signature).
 
-    Returns (node, cost) for reachable nodes."""
+    Size-gated: a graph that fits the driver replays the same
+    synchronous rounds in dicts; larger graphs run them as joins with
+    a ``localCheckpoint`` per round.  Returns (node, cost) for
+    reachable nodes; ``cost`` takes the type of ``0 + weight``
+    (bigint for integer weights, double for double weights)."""
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
-    ).localCheckpoint()  # relaxed against every round — pin the lineage once
-    dist = local_df(spark, [(source, 0)], "node long, cost long").localCheckpoint()
+    seed = local_df(spark, [(source, 0)], "node long, cost long")
+    with driver_rows(edges, (src, dst, weight)) as rows:
+        if rows is None:
+            return _shortest_paths(edges, seed, src, dst, weight, max_iter)
+    dist = {source: 0}
     for _ in range(max_iter):
-        relax = (
-            e.join(dist.withColumnRenamed("node", "u"), "u")
-            .select(F.col("v").alias("node"), (F.col("cost") + F.col("w")).alias("cand"))
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        new = (
-            dist.join(relax, "node", "full")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("cost"), F.col("cand")),
-                    F.coalesce(F.col("cand"), F.col("cost")),
-                ).alias("cost"),
-                (
-                    F.col("cost").isNull()
-                    | (F.coalesce(F.col("cand"), F.col("cost")) < F.col("cost"))
-                ).alias("_changed"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        changed = False
+        relax: dict = {}
+        for u, v, w in rows:
+            if u in dist:
+                c = dist[u] + w
+                if c < relax.get(v, c + 1):
+                    relax[v] = c
+        for v, c in relax.items():
+            if c < dist.get(v, c + 1):
+                dist[v] = c
+                changed = True
+        if not changed:
+            break
+    schema = _relax(_weighted(edges, src, dst, weight), seed).drop("_changed").schema
+    return local_df(spark, dist.items(), schema)
+
+
+def _shortest_paths(
+    edges: DataFrame, dist: DataFrame, src: str, dst: str, weight: str,
+    max_iter: int,
+) -> DataFrame:
+    """Distributed side of ``shortest_paths``."""
+    # relaxed against every round — pin the lineage once
+    e = _weighted(edges, src, dst, weight).localCheckpoint()
+    dist = dist.localCheckpoint()
+    for _ in range(max_iter):
+        new = _relax(e, dist).localCheckpoint(eager=False)
         changed = new.filter(F.col("_changed")).count()
         dist = new.drop("_changed")
         if changed == 0:
             break
     return dist
+
+
+def _topk_round(e: DataFrame, dist: DataFrame, seed: DataFrame, k: int) -> DataFrame:
+    """D(v) ← topk(seed ∪ {c + w : (u, v, w), c ∈ D(u)}) as (node, costs)."""
+    cand = e.join(dist.withColumnRenamed("node", "u"), "u").select(
+        F.col("v").alias("node"),
+        F.explode(F.transform("costs", lambda c: c + F.col("w"))).alias("cand"),
+    )
+    return (
+        seed.unionByName(cand)
+        .groupBy("node")
+        .agg(
+            F.slice(
+                F.array_sort(F.array_distinct(F.collect_list("cand"))), 1, k
+            ).alias("costs")
+        )
+    )
+
+
+def _ranked(dist: DataFrame) -> DataFrame:
+    return dist.select(
+        "node", F.posexplode("costs").alias("rank", "cost")
+    ).select("node", F.col("rank").cast("int").alias("rank"), "cost")
 
 
 def k_shortest_costs(
@@ -372,33 +480,47 @@ def k_shortest_costs(
     cyclic graphs walks may revisit nodes (documented divergence from
     Yen's loopless contract, which is inherently sequential).
 
-    Returns (node, rank, cost) with rank 0..k-1 per reachable node.
-    One shuffle per round (join on u, explode, min-combine);
-    ``localCheckpoint`` truncates lineage as in ``shortest_paths``.
+    Size-gated: a graph that fits the driver replays the same rounds
+    in dicts; larger graphs run one shuffle per round (join on u,
+    explode, min-combine) with a ``localCheckpoint`` per round.
+    Returns (node, rank, cost) with rank 0..k-1 per reachable node;
+    ``cost`` is typed as in ``shortest_paths``.
     """
     spark = edges.sparkSession
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
-    ).localCheckpoint()
     seed = local_df(spark, [(source, 0)], "node long, cand long")
-    dist = local_df(spark, 
-        [(source, [0])], "node long, costs array<long>"
-    ).localCheckpoint()
+    dist0 = local_df(spark, [(source, [0])], "node long, costs array<long>")
+    with driver_rows(edges, (src, dst, weight)) as rows:
+        if rows is None:
+            return _k_shortest_costs(
+                edges, seed, dist0, k, src, dst, weight, max_iter)
+    dist = {source: [0]}
     for _ in range(max_iter):
-        cand = e.join(dist.withColumnRenamed("node", "u"), "u").select(
-            F.col("v").alias("node"),
-            F.explode(F.transform("costs", lambda c: c + F.col("w"))).alias("cand"),
-        )
-        new = (
-            seed.unionByName(cand)
-            .groupBy("node")
-            .agg(
-                F.slice(
-                    F.array_sort(F.array_distinct(F.collect_list("cand"))), 1, k
-                ).alias("costs")
-            )
-            .localCheckpoint(eager=False)
-        )
+        cand: dict = {source: {0}}
+        for u, v, w in rows:
+            if u in dist:
+                cand.setdefault(v, set()).update(c + w for c in dist[u])
+        new = {v: sorted(s)[:k] for v, s in cand.items()}
+        if new == dist:
+            break
+        dist = new
+    schema = _ranked(
+        _topk_round(_weighted(edges, src, dst, weight), dist0, seed, k)).schema
+    return local_df(
+        spark,
+        [(v, rank, c) for v, costs in dist.items() for rank, c in enumerate(costs)],
+        schema,
+    )
+
+
+def _k_shortest_costs(
+    edges: DataFrame, seed: DataFrame, dist: DataFrame, k: int, src: str,
+    dst: str, weight: str, max_iter: int,
+) -> DataFrame:
+    """Distributed side of ``k_shortest_costs``."""
+    e = _weighted(edges, src, dst, weight).localCheckpoint()
+    dist = dist.localCheckpoint()
+    for _ in range(max_iter):
+        new = _topk_round(e, dist, seed, k).localCheckpoint(eager=False)
         changed = (
             new.withColumnRenamed("costs", "_new")
             .join(dist, "node", "full")
@@ -408,140 +530,4 @@ def k_shortest_costs(
         dist = new
         if changed == 0:
             break
-    return dist.select(
-        "node", F.posexplode("costs").alias("rank", "cost")
-    ).select("node", F.col("rank").cast("int").alias("rank"), "cost")
-
-
-def shortest_paths_auto(
-    edges: DataFrame,
-    source: int,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    threshold: int = 200_000,
-    max_iter: int = 100,
-) -> DataFrame:
-    """Size-gated SSSP — the same judgment as
-    ``connected_components_auto``: a graph whose edge table fits the
-    driver replays the IDENTICAL min-relaxation fixpoint in local
-    dicts (same result set, no per-round job latency); larger graphs
-    run the distributed Bellman-Ford loop."""
-    edges = edges.persist()
-    n = edges.limit(threshold + 1).count()
-    if n > threshold:
-        out = shortest_paths(
-            edges, source, src=src, dst=dst, weight=weight, max_iter=max_iter
-        )
-        edges.unpersist()
-        return out
-    spark = edges.sparkSession
-    e = [(r[src], r[dst], r[weight]) for r in edges.collect()]
-    edges.unpersist()
-    dist = {source: 0}
-    for _ in range(max_iter):
-        changed = False
-        relax: dict = {}
-        for u, v, w in e:
-            if u in dist:
-                c = dist[u] + w
-                if c < relax.get(v, c + 1):
-                    relax[v] = c
-        for v, c in relax.items():
-            if c < dist.get(v, c + 1):
-                dist[v] = c
-                changed = True
-        if not changed:
-            break
-    return local_df(
-        spark, [(int(v), int(c)) for v, c in dist.items()], "node long, cost long"
-    )
-
-
-def k_shortest_costs_auto(
-    edges: DataFrame,
-    source: int,
-    k: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    threshold: int = 200_000,
-    max_iter: int = 100,
-) -> DataFrame:
-    """Size-gated top-k-distinct-cost closure: replays
-    ``k_shortest_costs``'s exact round recurrence
-    (D(v) ← topk(seed ∪ {c+w : (u,v,w), c ∈ D(u)}), recomputed from
-    scratch each round, k smallest DISTINCT costs) in driver dicts for
-    graphs under ``threshold`` edges; the distributed loop takes over
-    past it.  Output is identical by construction."""
-    edges = edges.persist()
-    n = edges.limit(threshold + 1).count()
-    if n > threshold:
-        out = k_shortest_costs(
-            edges, source, k=k, src=src, dst=dst, weight=weight, max_iter=max_iter
-        )
-        edges.unpersist()
-        return out
-    spark = edges.sparkSession
-    e = [(r[src], r[dst], r[weight]) for r in edges.collect()]
-    edges.unpersist()
-    dist = {source: [0]}
-    for _ in range(max_iter):
-        cand: dict = {source: {0}}
-        for u, v, w in e:
-            if u in dist:
-                cand.setdefault(v, set()).update(c + w for c in dist[u])
-        new = {v: sorted(s)[:k] for v, s in cand.items()}
-        if new == dist:
-            break
-        dist = new
-    return local_df(
-        spark,
-        [
-            (int(v), int(rank), int(c))
-            for v, costs in dist.items()
-            for rank, c in enumerate(costs)
-        ],
-        "node long, rank int, cost long",
-    )
-
-
-def connected_components_auto(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    threshold: int = 200_000,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Size-gated CC — the same judgment as the polygonize label graph
-    (operators/polygonize._label_roots): graphs up to ``threshold``
-    edge rows union-find at the driver in one pass (min-id roots,
-    identical output), larger graphs run the distributed
-    pointer-jumping loop.  At bench scale this trades O(log diameter)
-    fixed-latency rounds for a millisecond driver step; at corpus
-    scale the distributed path takes over automatically."""
-    edges = edges.persist()
-    n = edges.limit(threshold + 1).count()
-    if n > threshold:
-        out = connected_components(edges, src=src, dst=dst, max_iter=max_iter)
-        edges.unpersist()
-        return out
-    spark = edges.sparkSession
-    parent: dict = {}
-
-    def find(a):
-        parent.setdefault(a, a)
-        root = a
-        while parent[root] != root:
-            root = parent[root]
-        while parent[a] != root:
-            parent[a], a = root, parent[a]
-        return root
-
-    for r in edges.collect():
-        ra, rb = find(r[src]), find(r[dst])
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    edges.unpersist()
-    rows = [(int(a), int(find(a))) for a in list(parent)]
-    return local_df(spark, rows, "node long, component long")
+    return _ranked(dist)

@@ -101,17 +101,6 @@ def _fanout_in_radius(
     return p.withColumn("d2", d2).filter(F.col("d2") <= F.lit(radius * radius))
 
 
-def grid_moving_average(
-    points: DataFrame, x0, y0, cell, nx, ny, radius,
-    lon: str = "lon", lat: str = "lat", value_col: str = "v",
-) -> DataFrame:
-    """GDALGridMovingAverage: plain mean of points within radius."""
-    p = _fanout_in_radius(points, x0, y0, cell, nx, ny, radius, lon, lat, value_col)
-    return p.groupBy("i", "j").agg(
-        F.round(F.avg("pv"), 6).alias("avg_v"), F.count("*").alias("npts")
-    )
-
-
 def grid_data_metrics(
     points: DataFrame, x0, y0, cell, nx, ny, radius,
     lon: str = "lon", lat: str = "lat", value_col: str = "v",

@@ -8,15 +8,14 @@ raster.  The distributed decomposition:
      embarrassingly parallel, the dominant cost)
   2. border-run equi-join on shared tile edges: facing runs with equal
      pixel value and overlapping extent ⇒ same global component
-  3. connected components over the (tile, local_label) graph —
-     size-gated (``_label_roots``): graphs up to the threshold
-     union-find on the collected edge list at the driver (same judgment
-     as the reference's merge map,
+  3. connected components over the (tile, local_label) graph
+     (``_label_roots``): packed (tx, ty, label) node ids through
+     ``graph.connected_components``, whose size gate union-finds a
+     graph that fits the driver (the reference's merge map,
      gdalrasterpolygonenumerator.cpp:75-167 — milliseconds, no
-     shuffles); past it (a 100-TB noisy raster has billions of border
-     runs) the distributed pointer-jumping CC of ``operators.graph``
-     takes over on packed (tx, ty, label) node ids.  Both paths root at
-     the lexicographic-min id, so results are bit-identical.
+     shuffles) and pointer-jumps in Spark past it (a 100-TB noisy
+     raster has billions of border runs).  Both sides root at the
+     lexicographic-min id, so results are bit-identical.
   4. global region table = per-tile summaries re-keyed by root label
      (one groupBy), optionally with dissolved geometry per region.
 
@@ -35,52 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gdal_spark.session import local_df
-
 from gdal_spark.kernels.ccl import border_runs, extract_polygons, label_tile, region_table
-
-REGION_SCHEMA = T.StructType(
-    [
-        T.StructField("tx", T.LongType()),
-        T.StructField("ty", T.LongType()),
-        T.StructField("local_label", T.IntegerType()),
-        T.StructField("dn", T.DoubleType()),
-        T.StructField("pixel_count", T.LongType()),
-    ]
-)
-
-BORDER_SCHEMA = T.StructType(
-    [
-        T.StructField("tx", T.LongType()),
-        T.StructField("ty", T.LongType()),
-        T.StructField("side", T.StringType()),
-        T.StructField("start", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("local_label", T.IntegerType()),
-        T.StructField("dn", T.DoubleType()),
-    ]
-)
-
-
-class _DSU:
-    def __init__(self):
-        self.p = {}
-
-    def find(self, a):
-        p = self.p
-        p.setdefault(a, a)
-        root = a
-        while p[root] != root:
-            root = p[root]
-        while p[a] != root:
-            p[a], a = root, p[a]
-        return root
-
-    def union(self, a, b):
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            self.p[max(ra, rb)] = min(ra, rb)
-
+from gdal_spark.operators.graph import connected_components
 
 _TY_BITS = 21
 _LAB_BITS = 21
@@ -92,9 +47,9 @@ def _enc(tx, ty, lab):
     """Pack (tx, ty, local_label) into one long: (tx<<42)|(ty<<21)|lab.
     Supports rasters up to 2^20 tiles per axis (≈ 2.7·10^8 pixels/side
     at ts=256) and 2^21 labels per tile (> ts² for ts ≤ 1448).  Packed
-    ordering == lexicographic (tx, ty, label) ordering, so min-id
-    component roots agree exactly between the driver union-find and the
-    distributed CC."""
+    ordering == lexicographic (tx, ty, label) ordering, so the min-id
+    component root is the lexicographic-min node on either side of the
+    connected-components size gate."""
     return (
         F.col(tx).cast("long") * (1 << (_TY_BITS + _LAB_BITS))
         + F.col(ty).cast("long") * (1 << _LAB_BITS)
@@ -102,49 +57,17 @@ def _enc(tx, ty, lab):
     )
 
 
-def _label_roots(
-    spark, edges: DataFrame, threshold: int = 200_000
-) -> DataFrame | None:
+def _label_roots(edges: DataFrame) -> DataFrame | None:
     """(tx, ty, local_label) → (root_tx, root_ty, root_label) for the
-    cross-tile label-merge graph.  Small graphs (≤ ``threshold`` edge
-    rows) union-find at the driver — the same judgment as the
-    reference's merge map (alg/gdalrasterpolygonenumerator.cpp:75-167):
-    the label graph is O(border runs), and a driver pass beats log(n)
-    full-graph shuffles.  PAST the threshold (a 100-TB noisy raster has
-    billions of border runs) the pointer-jumping CC of
-    ``operators.graph`` takes over on packed node ids — both paths pick
-    the lexicographic-min (tx, ty, label) as root, so results are
-    bit-identical.  Returns None when the graph has no edges."""
-    from gdal_spark.operators.graph import connected_components
-
-    edges = edges.persist()
-    n = edges.limit(threshold + 1).count()
-    if n == 0:
-        edges.unpersist()
-        return None
-    if n <= threshold:
-        dsu = _DSU()
-        for r in edges.collect():
-            dsu.union(
-                (r["tx"], r["ty"], r["local_label"]),
-                (r["rtx"], r["rty"], r["rlabel"]),
-            )
-        edges.unpersist()
-        mapping = [
-            (int(a[0]), int(a[1]), int(a[2]), int(root[0]), int(root[1]), int(root[2]))
-            for a in list(dsu.p)
-            for root in [dsu.find(a)]
-        ]
-        return local_df(spark, 
-            mapping,
-            "tx long, ty long, local_label int, root_tx long, root_ty long, root_label int",
-        )
-    ids = edges.select(
+    cross-tile label-merge graph: pack the node ids (``_enc``), run the
+    size-gated ``connected_components``, unpack the roots.  Returns
+    None when the graph has no edges."""
+    comp = connected_components(edges.select(
         _enc("tx", "ty", "local_label").alias("src"),
         _enc("rtx", "rty", "rlabel").alias("dst"),
-    )
-    comp = connected_components(ids)
-    edges.unpersist()
+    ))
+    if comp.isEmpty():
+        return None
     return comp.select(
         F.shiftright("node", _TY_BITS + _LAB_BITS).alias("tx"),
         F.shiftright("node", _LAB_BITS).bitwiseAND(F.lit(_TY_MASK)).alias("ty"),
@@ -270,11 +193,9 @@ def polygonize_tiles(
     nodata: float | None = None,
     connect8: bool = False,
     tile_size: int = 256,
-    cc_threshold: int = 200_000,
 ) -> DataFrame:
     """Tile table → global region table (region_id, dn, pixel_count,
     n_tiles) with exact cross-tile merging."""
-    spark = tiles.sparkSession
     mixed = _tile_ccl(tiles, nodata, connect8, tile_size).persist()
     regions = mixed.filter(F.col("kind") == "R").drop("kind", "side", "start", "end")
     borders = (
@@ -290,9 +211,8 @@ def polygonize_tiles(
     # adjacency is added — see ``_merge_edges``.
     edges = _merge_edges(borders, connect8, tile_size)
 
-    # Label-graph roots: driver union-find for small graphs, the
-    # distributed pointer-jumping CC past the threshold (_label_roots).
-    map_df = _label_roots(spark, edges, threshold=cc_threshold)
+    # Label-graph roots through the size-gated connected components.
+    map_df = _label_roots(edges)
 
     keyed = regions
     if map_df is not None:
@@ -329,7 +249,6 @@ def polygonize_dissolved(
     connect8: bool = False,
     tile_size: int = 256,
     gt: tuple[float, ...] = (0.0, 1.0, 0.0, 0.0, 0.0, 1.0),
-    cc_threshold: int = 200_000,
 ) -> DataFrame:
     """Polygonize with CROSS-TILE dissolved geometry — the full
     GDALPolygonize output (one polygon with holes per global region,
@@ -352,7 +271,6 @@ def polygonize_dissolved(
     from gdal_spark.kernels.ccl import _boundary_edges, _chain_rings, _ring_area
     from gdal_spark.kernels.geodesy import pixel_to_world
 
-    spark = tiles.sparkSession
     mixed_schema = T.StructType(
         [
             T.StructField("kind", T.StringType()),
@@ -395,7 +313,7 @@ def polygonize_dissolved(
     mixed = tiles.mapInPandas(per_tile, mixed_schema).persist()
     borders = mixed.filter(F.col("kind") == "B").drop("kind", "edges")
     edges_lr = _merge_edges(borders, connect8, tile_size)
-    map_df = _label_roots(spark, edges_lr, threshold=cc_threshold)
+    map_df = _label_roots(edges_lr)
     e_rows = mixed.filter(F.col("kind") == "E").select(
         "tx", "ty", "local_label", "dn", "edges"
     )

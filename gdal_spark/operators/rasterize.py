@@ -544,14 +544,3 @@ def checksum_tiles(tiles: DataFrame, tile_size: int, width: int) -> DataFrame:
     return partials.agg(
         (F.sum("partial") % 65536).cast("long").alias("checksum")
     )
-
-
-def tiles_to_arrays(tiles_pdf: pd.DataFrame, tile_size: int = TILE_SIZE) -> dict:
-    """Collect helper for tests: {(z, tx, ty): ndarray}."""
-    out = {}
-    for _, row in tiles_pdf.iterrows():
-        arr = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(
-            tile_size, tile_size
-        )
-        out[(row["z"], row["tx"], row["ty"])] = arr
-    return out

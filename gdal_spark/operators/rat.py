@@ -63,45 +63,3 @@ def build_rat(
         ),
         F.row_number().over(ordered).alias("rnk"),
     )
-
-
-def apply_rat(
-    tiles: DataFrame,
-    rat: DataFrame,
-    field: str,
-    tile_size: int = 256,
-    default: float = 0.0,
-) -> DataFrame:
-    """Reclassify tiles through a RAT column (value → rat[field]) —
-    the GDALRasterAttributeTable consumer path: broadcast the table,
-    LUT per tile, no shuffle of raster data."""
-    ts = tile_size
-    rows = rat.select("value", F.col(field).cast("double").alias("_f")).collect()
-    lut = {float(r["value"]): float(r["_f"]) for r in rows}
-    spark = tiles.sparkSession
-    blut = spark.sparkContext.broadcast(lut)
-    schema = tiles.select("tx", "ty", "data", "dtype").schema
-
-    def gen(pdf_iter):
-        for pdf in pdf_iter:
-            out = []
-            for _, row in pdf.iterrows():
-                arr = np.frombuffer(
-                    row["data"], dtype=np.dtype(row["dtype"])
-                ).reshape(ts, ts)
-                vals, inv = np.unique(arr, return_inverse=True)
-                mapped = np.array(
-                    [blut.value.get(float(v), default) for v in vals],
-                    dtype=np.float64,
-                )
-                out.append(
-                    (
-                        row["tx"],
-                        row["ty"],
-                        mapped[inv].reshape(ts, ts).tobytes(),
-                        "float64",
-                    )
-                )
-            yield pd.DataFrame(out, columns=["tx", "ty", "data", "dtype"])
-
-    return tiles.select("tx", "ty", "data", "dtype").mapInPandas(gen, schema)

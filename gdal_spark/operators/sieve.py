@@ -14,19 +14,20 @@ Distributed decomposition (same skeleton as ``operators.polygonize``):
   2. cross-tile: facing border-run join — equal-dn overlaps are
      same-region merge edges (exactly ``polygonize._merge_edges``),
      different-dn overlaps are region ADJACENCY;
-  3. same-region roots via ``polygonize._label_roots`` — driver
-     union-find below the size threshold, distributed pointer-jumping
-     CC past it; region sizes and the contracted region-level
-     adjacency are DataFrame aggregations (groupBy root / distinct
-     root-pair join), never collected in full;
-  4. driver: collect ONLY the under-threshold subgraph — small-region
-     stats plus adjacency edges incident to a small region plus those
-     neighbours' stats — and run the merge loop there (small region →
-     largest current neighbour, by (count, id) — deterministic).
-     Sufficient because absorption only ever grows regions: a region
-     ≥ threshold at the start can never be absorbed, so the loop's
-     reachable state is exactly the small-incident subgraph.  Driver
-     memory is O(small regions), not O(regions) or O(border runs);
+  3. same-region roots via ``polygonize._label_roots`` (the
+     size-gated ``graph.connected_components``); region sizes and the
+     contracted region-level adjacency are DataFrame aggregations
+     (groupBy root / distinct root-pair join), never collected in full;
+  4. absorption over ONLY the under-threshold subgraph — adjacency
+     edges incident to a small region plus their endpoints' stats —
+     small region → largest current neighbour, by (count, id),
+     deterministic.  Sufficient because absorption only ever grows
+     regions: a region ≥ threshold at the start can never be absorbed,
+     so the loop's reachable state is exactly the small-incident
+     subgraph.  The subgraph goes through the same size gate as the
+     graph operators (``graph.driver_rows``): collected to the driver
+     loop when it fits, the same rounds as distributed DataFrame
+     contractions past it;
   5. apply: broadcast the (tile, local_label) → merged dn map
      (CHANGED regions only) and relabel each tile independently (a
      second CCL pass per tile instead of shuffling label arrays);
@@ -47,6 +48,7 @@ from pyspark.sql import types as T
 from gdal_spark.session import local_df
 
 from gdal_spark.kernels.ccl import border_runs, label_tile, region_table
+from gdal_spark.operators import graph
 from gdal_spark.operators.polygonize import _label_roots
 
 
@@ -556,27 +558,21 @@ def sieve_tiles(
     nodata: float | None = 0.0,
     connect8: bool = False,
     tile_size: int = 256,
-    cc_threshold: int = 200_000,
-    absorb_gate: int = 200_000,
 ) -> DataFrame:
     """→ relabeled tile rows (tx, ty, data float64, dtype) with every
-    under-threshold region merged into its largest neighbour.
-
-    ``absorb_gate``: max under-threshold-incident edge count the
-    absorption loop may collect to the driver; larger subgraphs run
-    the identical round-synchronous contraction distributed
-    (_absorb_rounds_distributed) — no unbounded collect anywhere."""
+    under-threshold region merged into its largest neighbour.  No
+    unbounded collect anywhere: the label graph and the absorption
+    subgraph each pass the ``graph.driver_rows`` size gate."""
     spark = tiles.sparkSession
     mixed = _tile_pass(tiles, nodata, connect8, tile_size).persist()
     borders = mixed.filter(F.col("kind") == "B").drop("kind", "pixel_count", "lab_b")
     pairs = _cross_tile_pairs(borders, connect8, tile_size).persist()
 
     # same-region merge edges = equal-dn facing overlaps → roots
-    # (driver union-find under cc_threshold, distributed CC past it)
     same = pairs.filter(F.col("dn") == F.col("rdn")).select(
         "tx", "ty", "local_label", "rtx", "rty", "rlabel"
     )
-    root_map = _label_roots(spark, same, threshold=cc_threshold)
+    root_map = _label_roots(same)
 
     # per-root size + dn, computed distributively (dn is constant
     # within a root: merge edges require dn == rdn)
@@ -625,11 +621,11 @@ def sieve_tiles(
         .persist()
     )
 
-    # SIZE-GATED absorption (the _label_roots pattern): measure the
-    # under-threshold subgraph first; below the gate, collect it and
-    # run the round-synchronous driver loop; past the gate, run the
-    # SAME rounds as distributed DataFrame contractions — identical
-    # semantics, identical output (tests/test_sieve_distributed.py).
+    # SIZE-GATED absorption: the under-threshold subgraph goes through
+    # the graph operators' gate; under it the round-synchronous driver
+    # loop runs on the collected edges, past it the SAME rounds run as
+    # distributed DataFrame contractions — identical output
+    # (tests/test_sieve_distributed.py).
     small = root_stats.filter(F.col("total") < threshold)
     small_keys = small.select("root_tx", "root_ty", "root_label")
     inc_a = adj_edges.join(small_keys, ["root_tx", "root_ty", "root_label"], "leftsemi")
@@ -642,24 +638,24 @@ def sieve_tiles(
         ["broot_tx", "broot_ty", "broot_label"],
         "leftsemi",
     )
-    incident_df = inc_a.unionByName(inc_b).distinct().persist()
-    n_incident = incident_df.count()
+    incident_df = inc_a.unionByName(inc_b).distinct()
+    with graph.driver_rows(incident_df, incident_df.columns) as incident:
+        if incident is None:
+            changed_big_df = _absorb_rounds_distributed(
+                root_stats, incident_df, threshold
+            )
+    pairs.unpersist()
+    adj_edges.unpersist()
 
-    if n_incident <= absorb_gate:
-        incident = incident_df.collect()
-        endpoints = {}
+    changed_rows = None
+    if incident is not None:
         adj: dict = {}
         for r in incident:
-            a = (r["root_tx"], r["root_ty"], r["root_label"])
-            b = (r["broot_tx"], r["broot_ty"], r["broot_label"])
+            a, b = r[:3], r[3:]
             adj.setdefault(a, set()).add(b)
             adj.setdefault(b, set()).add(a)
-            endpoints[a] = None
-            endpoints[b] = None
-        ep_df = local_df(spark,
-            [(int(k[0]), int(k[1]), int(k[2])) for k in endpoints] or [(0, 0, -1)],
-            "root_tx long, root_ty long, root_label int",
-        )
+        ep_df = local_df(
+            spark, list(adj), "root_tx long, root_ty long, root_label int")
         need_stats = root_stats.join(
             ep_df, ["root_tx", "root_ty", "root_label"], "leftsemi"
         ).unionByName(small).distinct()
@@ -674,14 +670,6 @@ def sieve_tiles(
             (int(k[0]), int(k[1]), int(k[2]), float(dn_of[t]))
             for k, t in parent.items()
         ]
-    else:
-        changed_rows = None
-        changed_big_df = _absorb_rounds_distributed(
-            root_stats, incident_df, threshold
-        )
-    incident_df.unpersist()
-    pairs.unpersist()
-    adj_edges.unpersist()
 
     if changed_rows is None:
         # past the gate the changed set can be large — shuffle join,

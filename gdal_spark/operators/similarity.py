@@ -163,38 +163,6 @@ def ann_ivf(
     )
 
 
-def cosine_topk_lsh(
-    vectors: DataFrame,
-    k: int = 5,
-    n_planes: int = 6,
-    dim: int = 64,
-    vec_id: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All-pairs ANN top-k inside LSH buckets (approximate: recall
-    bounded by bucket collisions; the exactness-vs-throughput dial is
-    n_planes)."""
-    b = hyperplane_lsh_buckets(vectors, n_planes, dim, vec_col=vec_col)
-    left = b.select(
-        F.col(vec_id).alias("a"), F.col(vec_col).alias("va"), "bucket"
-    )
-    right = b.select(
-        F.col(vec_id).alias("b"), F.col(vec_col).alias("vb"), "bucket"
-    )
-    pairs = left.join(right, "bucket").filter(F.col("a") != F.col("b"))
-    sim = _dot(F.col("va"), F.col("vb")) / (
-        F.sqrt(_norm2(F.col("va"))) * F.sqrt(_norm2(F.col("vb")))
-    )
-    scored = pairs.withColumn("cosine", sim)
-    w = Window.partitionBy("a").orderBy(F.col("cosine").desc(), F.col("b").asc())
-    return (
-        scored.withColumn("sim_rank", F.row_number().over(w))
-        .filter(F.col("sim_rank") <= k)
-        .select(F.col("a").alias(vec_id), F.col("b").alias("neighbor"), "sim_rank",
-                F.round("cosine", 6).alias("cosine"))
-    )
-
-
 def _quantize_udf():
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def quantized(embs: pd.Series) -> pd.Series:

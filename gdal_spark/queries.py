@@ -1752,8 +1752,9 @@ DAG_EDGES_SQL = (
 def q47(spark, sf_dir):
     """GNM single-source shortest paths (gnmgraph.h:173) as iterative
     Bellman-Ford frontier relaxation (size-gated: driver replay of the
-    same fixpoint under 200k edges, distributed loop past it)."""
-    from gdal_spark.operators.graph import shortest_paths_auto
+    same fixpoint up to graph.DRIVER_EDGE_LIMIT edges, distributed loop
+    past it)."""
+    from gdal_spark.operators.graph import shortest_paths
 
     r = spark.range(59).withColumnRenamed("id", "u")
     e1 = r.select("u", (F.col("u") + 1 + (F.col("u") * 7) % 4).alias("v"))
@@ -1763,7 +1764,7 @@ def q47(spark, sf_dir):
         .filter(F.col("v") < 60)
         .withColumn("w", 1 + (F.col("u") * F.col("v")) % 7)
     )
-    return shortest_paths_auto(edges, source=0, src="u", dst="v")
+    return shortest_paths(edges, source=0, src="u", dst="v")
 
 
 # q51 rects: integer-cornered, each fully inside one 32px tile (two
@@ -2198,7 +2199,7 @@ def q64(spark, sf_dir):
     """GNM K-shortest-paths (gnmgraph.h:195, Yen) as the distributed
     top-k Bellman-Ford closure: 3 smallest distinct path costs per node
     on the q47 DAG — on a DAG this equals Yen's loopless cost vector."""
-    from gdal_spark.operators.graph import k_shortest_costs_auto
+    from gdal_spark.operators.graph import k_shortest_costs
 
     r = spark.range(59).withColumnRenamed("id", "u")
     e1 = r.select("u", (F.col("u") + 1 + (F.col("u") * 7) % 4).alias("v"))
@@ -2208,7 +2209,7 @@ def q64(spark, sf_dir):
         .filter(F.col("v") < 60)
         .withColumn("w", 1 + (F.col("u") * F.col("v")) % 7)
     )
-    return k_shortest_costs_auto(edges, source=0, k=3, src="u", dst="v").select(
+    return k_shortest_costs(edges, source=0, k=3, src="u", dst="v").select(
         "node", F.col("rank").alias("rnk"), "cost"
     )
 
@@ -3186,10 +3187,10 @@ def q94(spark, sf_dir):
     CC → keep min doc_id per duplicate cluster): what a training
     pipeline actually DOES with the pair list.  The oracle closes the
     pair graph with a recursive CTE."""
-    from gdal_spark.operators.graph import connected_components_auto
+    from gdal_spark.operators.graph import connected_components
 
     pairs = QUERIES["q18_minhash_lsh"](spark, sf_dir).select("a", "b")
-    comp = connected_components_auto(pairs, src="a", dst="b")
+    comp = connected_components(pairs, src="a", dst="b")
     return comp.select(
         F.col("node").alias("doc_id"), F.col("component").alias("canonical")
     )
@@ -8139,7 +8140,7 @@ def q216(spark, sf_dir):
     BORDER's component.  Edge count is linear in dark pixels; the CC
     is the same pointer-jumping machinery as polygonize label merging.
     Oracle: recursive-CTE reachability (monotone BFS)."""
-    from gdal_spark.operators.graph import connected_components_auto
+    from gdal_spark.operators.graph import connected_components
 
     g = spark.range(32).select(F.col("id").alias("gx")).crossJoin(
         spark.range(32).select(F.col("id").alias("gy")))
@@ -8166,7 +8167,7 @@ def q216(spark, sf_dir):
         | (F.col("gx") == 31) | (F.col("gy") == 31)
     ).select(F.lit(-1).cast("long").alias("src"), F.col("nid").alias("dst"))
     edges = right.unionByName(down).unionByName(border)
-    cc = connected_components_auto(edges)
+    cc = connected_components(edges)
     # BORDER's component root is min id = -1 (the virtual node)
     collar = cc.filter((F.col("component") == -1) & (F.col("node") >= 0))
     stats = dark.agg(F.count("*").alias("n_dark"))
@@ -10800,7 +10801,7 @@ def q472(spark, sf_dir):
     the general algorithm is verified against an independently
     derivable answer, not against itself.  mst_total rides on every
     row."""
-    from gdal_spark.operators.graph import boruvka_mst_auto
+    from gdal_spark.operators.graph import boruvka_mst
 
     ids = (_t(spark, sf_dir, "documents")
            .filter("doc_id < 48").selectExpr("doc_id AS i").distinct())
@@ -10814,7 +10815,7 @@ def q472(spark, sf_dir):
         .selectExpr("ia AS src", "ib AS dst",
                     "CAST(pb - pa AS BIGINT) AS w")
     )
-    mst = boruvka_mst_auto(edges)
+    mst = boruvka_mst(edges)
     tot = mst.groupBy().agg(F.sum("w").cast("long").alias("mst_total"))
     return mst.crossJoin(F.broadcast(tot)).select(
         F.col("u").cast("long").alias("u"),
@@ -11565,13 +11566,13 @@ def q509(spark, sf_dir):
     rule).  ENGINE: one banded grid self-join (cell = coord div 2,
     3x3 neighborhood) for eps-counts and core-core edges — candidate
     volume stays near-linear at corpus scale — then the size-gated
-    distributed CC (operators/graph.py::connected_components_auto,
-    pointer-jumping past 200k edges); the convergence residual is
-    RECOMPUTED from the final labels as a data-dependent proof
-    (conv_resid == 0), mirrored by the oracle's 9th propagation round
+    distributed CC (operators/graph.py::connected_components,
+    pointer-jumping past graph.DRIVER_EDGE_LIMIT edges); the
+    convergence residual is RECOMPUTED from the final labels as a
+    data-dependent proof (conv_resid == 0), mirrored by the oracle's 9th propagation round
     over its 8 unrolled MATERIALIZED min-label stages (the q276
     inlining lesson).  Oracle replays the naive quadratic join."""
-    from gdal_spark.operators.graph import connected_components_auto
+    from gdal_spark.operators.graph import connected_components
 
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     i = F.expr("doc_id div 10")
@@ -11606,7 +11607,7 @@ def q509(spark, sf_dir):
              .join(core, "doc_id").join(core2, "doc2")
              .select(F.col("doc_id").alias("src"),
                      F.col("doc2").alias("dst")))
-    comp = connected_components_auto(edges).localCheckpoint()
+    comp = connected_components(edges).localCheckpoint()
     # singleton cores (no core neighbor) are their own component
     lbl = (core.join(comp.withColumnRenamed("node", "doc_id"),
                      "doc_id", "left")

@@ -102,18 +102,23 @@ def local_df(spark, rows, schema):
     record batches on the driver; all subsequent scans are JVM-side
     (measured 0.2 s for the identical plan).  At cluster scale the same
     reasoning holds: broadcast-sized dims should never drag a Python
-    worker into every task that scans them.
+    worker into every task that scans them.  An empty table goes in as
+    an empty Arrow table (an empty pandas frame falls back to the Python
+    RDD), so it is a local relation too: scanning it, or asking
+    ``isEmpty()``, runs no Spark job.
     """
     rows = list(rows)
-    if not rows:
-        return spark.createDataFrame([], schema)
     if isinstance(schema, str):
         # proper DDL parse — naive ','-splitting misparses types that
         # contain commas (decimal(10,2), map<...>, struct<...>)
         from pyspark.sql import types as T
 
-        names = T._parse_datatype_string(schema).names
-    else:
-        names = schema.names
-    pdf = pd.DataFrame(rows, columns=names)
+        schema = T._parse_datatype_string(schema)
+    if not rows:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        empty = pa.Table.from_pylist([], schema=to_arrow_schema(schema))
+        return spark.createDataFrame(empty, schema=schema)
+    pdf = pd.DataFrame(rows, columns=schema.names)
     return spark.createDataFrame(pdf, schema=schema)

@@ -76,6 +76,39 @@ def test_densest_subgrid_wins():
     assert dlat[0] == (8 * 7 + 2 * 3) % 16
 
 
+def test_densest_by_cell_area_not_lat_inc():
+    # A has the finer lat_inc but the larger cell (1800" x 7200"); B's
+    # 3600" x 1800" cell is half the area, so B must win
+    a = SubGrid("A", 0.0, 7200.0, -14400.0, 0.0, 1800.0, 7200.0,
+                np.full((5, 3), 1.0, np.float32), np.zeros((5, 3), np.float32))
+    b = SubGrid("B", 0.0, 7200.0, -14400.0, 0.0, 3600.0, 1800.0,
+                np.full((3, 9), 2.0, np.float32), np.zeros((3, 9), np.float32))
+    for order in ([a, b], [b, a]):
+        grids = parse_ntv2(write_ntv2(order))
+        dlat, _ = shift_points(grids, np.array([1.0]), np.array([1.0]))
+        assert dlat[0] == 2.0
+
+
+@pytest.mark.parametrize("shape", [(1, 11), (11, 1)])
+def test_degenerate_subgrid_rejected(shape):
+    # one row (n_lat == s_lat) or one column (w_long == e_long): no
+    # 2x2 cell to interpolate in, so the parse must fail loudly
+    nrows, ncols = shape
+    g = SubGrid("THIN", 0.0, (nrows - 1) * 3600.0, -(ncols - 1) * 3600.0,
+                0.0, 3600.0, 3600.0, np.ones(shape, np.float32),
+                np.ones(shape, np.float32))
+    with pytest.raises(ValueError, match="2x2"):
+        parse_ntv2(write_ntv2([g]))
+
+
+def test_count_mismatch_rejected():
+    # the header's extent implies 11x11 nodes; GS_COUNT says 10x11
+    g = _grid()
+    g.lat_shift, g.lon_shift = g.lat_shift[:10], g.lon_shift[:10]
+    with pytest.raises(ValueError, match="GS_COUNT"):
+        parse_ntv2(write_ntv2([g]))
+
+
 def test_spark_udf_surface(spark):
     from gdal_spark.functions.st import gridshift_columns
 

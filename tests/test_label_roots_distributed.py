@@ -1,9 +1,10 @@
-"""The size-gated label-graph CC (`polygonize._label_roots`): past the
-threshold the driver union-find is replaced by the distributed
-pointer-jumping CC of `operators.graph`.  Both paths root components at
-the lexicographic-min (tx, ty, label), so polygonize / sieve results
-must be bit-identical either way — these tests force cc_threshold=0
-(always distributed) and compare against the default driver path.
+"""The size-gated label-graph CC (`polygonize._label_roots` through
+`graph.connected_components`): past `graph.DRIVER_EDGE_LIMIT` the driver
+union-find is replaced by the distributed pointer-jumping CC.  Both
+paths root components at the lexicographic-min (tx, ty, label), so
+polygonize / sieve results must be bit-identical either way — these
+tests force DRIVER_EDGE_LIMIT=0 (always distributed) and compare
+against the default driver path.
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ from __future__ import annotations
 import numpy as np
 
 from gdal_spark.kernels import wkb as W
+from gdal_spark.operators import graph
 from gdal_spark.operators.polygonize import polygonize_dissolved, polygonize_tiles
 from gdal_spark.operators.rasterize import rasterize_wkb_grid, tiles_to_features
 from gdal_spark.operators.sieve import sieve_tiles
@@ -43,12 +45,19 @@ def _region_set(df):
     return {(r["dn"], r["pixel_count"], r["n_tiles"]) for r in df.collect()}
 
 
-def test_polygonize_tiles_distributed_cc_matches_driver(spark):
+def _distributed(monkeypatch, fn, *args, **kwargs):
+    with monkeypatch.context() as m:
+        m.setattr(graph, "DRIVER_EDGE_LIMIT", 0)
+        return fn(*args, **kwargs)
+
+
+def test_polygonize_tiles_distributed_cc_matches_driver(spark, monkeypatch):
     tiles = _fixture(spark)
     for connect8 in (False, True):
         drv = polygonize_tiles(tiles, nodata=0.0, connect8=connect8, tile_size=32)
-        dist = polygonize_tiles(
-            tiles, nodata=0.0, connect8=connect8, tile_size=32, cc_threshold=0
+        dist = _distributed(
+            monkeypatch, polygonize_tiles,
+            tiles, nodata=0.0, connect8=connect8, tile_size=32
         )
         a = sorted((r["region_id"], r["dn"], r["pixel_count"], r["n_tiles"])
                    for r in drv.collect())
@@ -57,11 +66,11 @@ def test_polygonize_tiles_distributed_cc_matches_driver(spark):
         assert a == b  # region ids identical → identical roots
 
 
-def test_polygonize_dissolved_distributed_cc_matches_driver(spark):
+def test_polygonize_dissolved_distributed_cc_matches_driver(spark, monkeypatch):
     tiles = _fixture(spark)
     drv = polygonize_dissolved(tiles, nodata=0.0, tile_size=32).collect()
-    dist = polygonize_dissolved(
-        tiles, nodata=0.0, tile_size=32, cc_threshold=0
+    dist = _distributed(
+        monkeypatch, polygonize_dissolved, tiles, nodata=0.0, tile_size=32
     ).collect()
     key = lambda r: r["region_id"]
     for a, b in zip(sorted(drv, key=key), sorted(dist, key=key)):
@@ -71,10 +80,11 @@ def test_polygonize_dissolved_distributed_cc_matches_driver(spark):
         assert a["wkb"] == b["wkb"]
 
 
-def test_sieve_distributed_cc_matches_driver(spark):
+def test_sieve_distributed_cc_matches_driver(spark, monkeypatch):
     tiles = _fixture(spark)
     drv = sieve_tiles(tiles, threshold=5, nodata=0.0, tile_size=32)
-    dist = sieve_tiles(tiles, threshold=5, nodata=0.0, tile_size=32, cc_threshold=0)
+    dist = _distributed(
+        monkeypatch, sieve_tiles, tiles, threshold=5, nodata=0.0, tile_size=32)
     px_a = {(r["gx"], r["gy"]): r["v"]
             for r in tiles_to_features(drv, tile_size=32, nodata=0.0).collect()}
     px_b = {(r["gx"], r["gy"]): r["v"]
@@ -84,22 +94,18 @@ def test_sieve_distributed_cc_matches_driver(spark):
 
 
 def test_no_driver_dsu_past_threshold(spark, monkeypatch):
-    """Plan hygiene: with cc_threshold=0 the driver union-find must
-    never engage — sabotage _DSU and require the distributed CC path
-    to carry polygonize and sieve end to end."""
-    import gdal_spark.operators.polygonize as P
-    import gdal_spark.operators.sieve as S
-
-    class Boom:
-        def __init__(self):
-            raise AssertionError("driver DSU used past cc_threshold")
+    """Plan hygiene: with DRIVER_EDGE_LIMIT=0 the driver union-find must
+    never engage — sabotage the shared `graph._union_find` and require
+    the distributed CC path to carry polygonize and sieve end to end."""
+    def boom(pairs):
+        raise AssertionError("driver union-find used past DRIVER_EDGE_LIMIT")
 
     tiles = _fixture(spark)
-    monkeypatch.setattr(P, "_DSU", Boom)
-    out = polygonize_tiles(tiles, nodata=0.0, tile_size=32, cc_threshold=0)
+    monkeypatch.setattr(graph, "_union_find", boom)
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 0)
+    out = polygonize_tiles(tiles, nodata=0.0, tile_size=32)
     assert out.count() > 0
-    # sieve: the absorption-loop DSU (module-level import in sieve) is
-    # legitimately driver-side over the SMALL subgraph; only the label
-    # CC must avoid the driver — exercised via polygonize._label_roots
-    px = sieve_tiles(tiles, threshold=5, nodata=0.0, tile_size=32, cc_threshold=0)
+    # sieve: the label CC goes through polygonize._label_roots; the
+    # absorption stage (graph.driver_rows as well) runs distributed too
+    px = sieve_tiles(tiles, threshold=5, nodata=0.0, tile_size=32)
     assert px.count() > 0

@@ -8,6 +8,7 @@ order-free round-synchronous spec)."""
 import numpy as np
 
 from gdal_spark.kernels import wkb as W
+from gdal_spark.operators import graph
 from gdal_spark.operators.rasterize import rasterize_wkb_grid, tiles_to_features
 from gdal_spark.operators.sieve import _absorb_rounds, sieve_tiles
 
@@ -50,15 +51,17 @@ def _fixture(spark):
     return spark.createDataFrame(feats, "burn double, geom binary")
 
 
-def test_distributed_absorption_matches_driver(spark):
+def test_distributed_absorption_matches_driver(spark, monkeypatch):
     tiles = rasterize_wkb_grid(
         _fixture(spark), IDENTITY_GT, 64, 64, tile_size=32
     ).localCheckpoint()
     out_driver = sieve_tiles(
         tiles, threshold=5, nodata=0.0, tile_size=32
     )
+    # DRIVER_EDGE_LIMIT 0 puts the absorption subgraph past the gate
+    monkeypatch.setattr(graph, "DRIVER_EDGE_LIMIT", 0)
     out_dist = sieve_tiles(
-        tiles, threshold=5, nodata=0.0, tile_size=32, absorb_gate=0
+        tiles, threshold=5, nodata=0.0, tile_size=32
     )
     px_d = _px(tiles_to_features(out_driver, tile_size=32, nodata=0.0))
     px_x = _px(tiles_to_features(out_dist, tile_size=32, nodata=0.0))
