@@ -58,12 +58,6 @@ def char_count(col) -> Column:
     return F.length(col)
 
 
-def punct_ratio(col) -> Column:
-    n = F.length(col)
-    removed = F.length(F.regexp_replace(col, PUNCT_RE, ""))
-    return F.when(n > 0, (n - removed) / n).otherwise(F.lit(0.0))
-
-
 def mean_token_len(col) -> Column:
     tc = token_count(col)
     nonspace = F.length(F.regexp_replace(col, " ", ""))

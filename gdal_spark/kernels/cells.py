@@ -33,7 +33,6 @@ __all__ = [
     "cell_encode",
     "cell_decode",
     "cell_parent",
-    "cell_children",
     "cell_kring",
     "cell_bounds",
     "s2_encode",
@@ -80,16 +79,6 @@ def cell_parent(cid, parent_res: int) -> np.ndarray:
     if np.any(shift < 0):
         raise ValueError("parent_res coarser than cell res required")
     return cell_id_from_xy(x >> shift, y >> shift, parent_res)
-
-
-def cell_children(cid: int) -> np.ndarray:
-    """Four children of one cell id (scalar)."""
-    res, x, y = cell_decode(np.asarray([cid]))
-    r = int(res[0]) + 1
-    x0, y0 = int(x[0]) << 1, int(y[0]) << 1
-    xs = np.array([x0, x0 + 1, x0, x0 + 1], dtype=np.int64)
-    ys = np.array([y0, y0, y0 + 1, y0 + 1], dtype=np.int64)
-    return cell_id_from_xy(xs, ys, r)
 
 
 def cell_kring(cid: int, k: int) -> np.ndarray:

@@ -21,9 +21,7 @@ TILE_SIZE = 256
 
 __all__ = [
     "pixel_to_world",
-    "world_to_pixel_gt",
     "lonlat_to_webmerc",
-    "webmerc_to_lonlat",
     "tile_of_webmerc",
     "tile_geotransform",
     "hilbert_d2xy",
@@ -38,12 +36,6 @@ def pixel_to_world(px, py, gt):
     return x0 + px * xs + py * xr, y0 + px * yr + py * ys
 
 
-def world_to_pixel_gt(xs, ys, gt):
-    from gdal_spark.kernels.burn import world_to_pixel
-
-    return world_to_pixel(xs, ys, gt)
-
-
 def lonlat_to_webmerc(lon, lat):
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
@@ -51,14 +43,6 @@ def lonlat_to_webmerc(lon, lat):
     latc = np.clip(lat, -85.06, 85.06)
     y = np.log(np.tan((90.0 + latc) * np.pi / 360.0)) / np.pi * WEBMERC_MAX
     return x, y
-
-
-def webmerc_to_lonlat(x, y):
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    lon = x / WEBMERC_MAX * 180.0
-    lat = np.degrees(2.0 * np.arctan(np.exp(y * np.pi / WEBMERC_MAX)) - np.pi / 2.0)
-    return lon, lat
 
 
 def tile_of_webmerc(x, y, z):

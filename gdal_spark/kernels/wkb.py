@@ -6,8 +6,8 @@ WKB-native helpers that work without full deserialization
 (OGRWKBGetBoundingBox ogr/ogr_wkb.h:30, OGRWKBIntersectsPessimistic
 ogr/ogr_wkb.h:36).  This module provides the same: encode/decode for
 Point / LineString / Polygon / MultiPoint / MultiLineString /
-MultiPolygon (2-D, little-endian), batched bbox extraction, and WKT
-parsing for fixtures.
+MultiPolygon (2-D, little-endian; ISO Z/M input decodes to its x/y
+projection), batched bbox extraction, and WKT parsing for fixtures.
 """
 
 from __future__ import annotations
@@ -98,29 +98,36 @@ def parse_wkb(wkb: bytes):
     return geom_type, parts
 
 
+def _xy(buf: memoryview, fmt: str, n: int, dim: int, off: int) -> np.ndarray:
+    """n vertices of ``dim`` doubles each at ``off`` → (n, 2) x/y."""
+    c = np.frombuffer(buf, dtype=fmt + "f8", count=dim * n, offset=off).reshape(n, dim)
+    return (c if dim == 2 else c[:, :2]).copy()
+
+
 def _parse(buf: memoryview, off: int):
     little = buf[off] == 1
     fmt = "<" if little else ">"
-    gtype = _read_uint32(buf, off + 1, little) % 1000  # strip Z/M variants
+    code = _read_uint32(buf, off + 1, little)
+    # ISO Z / M / ZM variants (code + 1000 / 2000 / 3000) carry 3 or 4
+    # doubles per vertex; read the full stride, keep x/y
+    gtype, flavor = code % 1000, code // 1000
+    if flavor > 3:
+        raise ValueError(f"unsupported WKB geometry type {code}")
+    dim = 2 + bin(flavor).count("1")
     off += 5
     if gtype == POINT:
-        x, y = struct.unpack_from(fmt + "dd", buf, off)
-        return POINT, np.array([[x, y]]), off + 16
+        return POINT, _xy(buf, fmt, 1, dim, off), off + 8 * dim
     if gtype == LINESTRING:
         n = _read_uint32(buf, off, little)
-        coords = np.frombuffer(buf, dtype=fmt + "f8", count=2 * n, offset=off + 4)
-        return LINESTRING, coords.reshape(n, 2).copy(), off + 4 + 16 * n
+        return LINESTRING, _xy(buf, fmt, n, dim, off + 4), off + 4 + 8 * dim * n
     if gtype == POLYGON:
         nr = _read_uint32(buf, off, little)
         off += 4
         rings = []
         for _ in range(nr):
             n = _read_uint32(buf, off, little)
-            coords = np.frombuffer(
-                buf, dtype=fmt + "f8", count=2 * n, offset=off + 4
-            )
-            rings.append(coords.reshape(n, 2).copy())
-            off += 4 + 16 * n
+            rings.append(_xy(buf, fmt, n, dim, off + 4))
+            off += 4 + 8 * dim * n
         return POLYGON, rings, off
     if gtype in (MULTIPOINT, MULTILINESTRING, MULTIPOLYGON, GEOMETRYCOLLECTION):
         n = _read_uint32(buf, off, little)
@@ -218,6 +225,10 @@ def fmt_coords_batch(coords: np.ndarray) -> list[str]:
 
 
 def wkb_to_wkt(wkb: bytes) -> str:
+    """2-D WKT of a 2-D WKB geometry.  Z/M input raises rather than
+    silently dropping its extra ordinates."""
+    if _read_uint32(memoryview(wkb), 1, wkb[0] == 1) >= 1000:
+        raise ValueError("wkb_to_wkt writes 2-D WKT only; got a Z/M geometry")
     gtype, parts = parse_wkb(wkb)
     if gtype == POINT:
         return f"POINT ({_fmt_coords(parts)})"

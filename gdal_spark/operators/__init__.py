@@ -2,6 +2,6 @@
 
 Each operator is a function DataFrame → DataFrame built from
 declarative Spark primitives plus the NumPy kernels, with explicit
-partitioning / broadcast / salting decisions documented inline —
+partitioning / broadcast / shuffle decisions documented inline —
 the scale-out strategies the single-node reference leaves implicit.
 """

@@ -20,8 +20,9 @@ Two entry points:
   partial combine, then one dense tile assembled per tile key, or,
   with ``min_z``, the tiles and their SUM overview levels assembled
   per ancestor tile)
-- ``rasterize_features`` — polygon/line burn via applyInPandas per
-  tile with the exact scanline/Bresenham kernels
+- ``rasterize_wkb_grid`` — polygon/line burn onto an arbitrary
+  geotransform grid via one applyInPandas per block with the exact
+  scanline/Bresenham kernels
 """
 
 from __future__ import annotations
@@ -36,7 +37,6 @@ from gdal_spark.kernels import wkb as W
 from gdal_spark.kernels.burn import (
     burn_all_touched_line,
     burn_line,
-    burn_points,
     burn_polygon,
     copy_word,
     world_to_pixel,
@@ -209,98 +209,6 @@ def rasterize_points(
     return pixels.groupBy(*keys).applyInPandas(assemble, TILE_SCHEMA)
 
 
-def rasterize_features(
-    features: DataFrame,
-    z: int,
-    burn_value_col: str = "burn",
-    geom_col: str = "geom",
-    dtype: str = "float64",
-    merge_add: bool = False,
-    all_touched: bool = False,
-    tile_size: int = TILE_SIZE,
-) -> DataFrame:
-    """Burn WKB polygon/line features into zoom-z tiles.
-
-    Features are exploded onto every tile their envelope covers
-    (WKB-direct bbox, no full parse — OGRWKBGetBoundingBox's role),
-    then one task burns one tile with the exact scanline kernels.
-    Feature burn order within a tile follows a deterministic
-    (_feature_seq) sort so MERGE=REPLACE output is reproducible on any
-    cluster — the distributed stand-in for the reference's layer
-    iteration order.
-    """
-
-    @F.pandas_udf(T.ArrayType(T.ArrayType(T.LongType())))
-    def covered_tiles(geoms: pd.Series) -> pd.Series:
-        out = []
-        for blob in geoms:
-            xmin, ymin, xmax, ymax = W.wkb_bbox(bytes(blob))
-            mx, my = lonlat_to_webmerc(np.array([xmin, xmax]), np.array([ymin, ymax]))
-            tx0, ty1 = tile_of_webmerc(mx[0], my[0], z)
-            tx1, ty0 = tile_of_webmerc(mx[1], my[1], z)
-            tiles = [
-                [int(tx), int(ty)]
-                for tx in range(int(tx0), int(tx1) + 1)
-                for ty in range(int(ty0), int(ty1) + 1)
-            ]
-            out.append(tiles)
-        return pd.Series(out)
-
-    feats = (
-        features.withColumn("_feature_seq", F.monotonically_increasing_id())
-        .withColumn("_tile", F.explode(covered_tiles(F.col(geom_col))))
-        .withColumn("tx", F.col("_tile")[0])
-        .withColumn("ty", F.col("_tile")[1])
-        .drop("_tile")
-    )
-
-    def burn_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        gt = tile_geotransform(z, tx, ty, tile_size)
-        arr = np.zeros((tile_size, tile_size), dtype=np.dtype(dtype))
-        pdf = pdf.sort_values("_feature_seq")
-        for blob, bv in zip(pdf[geom_col], pdf[burn_value_col]):
-            gtype, parts = W.parse_wkb(bytes(blob))
-            visited: set = set()
-            if gtype in (W.POLYGON, W.MULTIPOLYGON):
-                polys = W.polygon_rings(bytes(blob))
-                for rings in polys:
-                    pix_rings = []
-                    for r in rings:
-                        mx, my = lonlat_to_webmerc(r[:, 0], r[:, 1])
-                        px_, py_ = world_to_pixel(mx, my, gt)
-                        pix_rings.append(np.column_stack([px_, py_]))
-                    burn_polygon(arr, pix_rings, float(bv), merge_add=merge_add)
-            elif gtype in (W.LINESTRING, W.MULTILINESTRING):
-                lines = [parts] if gtype == W.LINESTRING else [p for _, p in parts]
-                for coords in lines:
-                    mx, my = lonlat_to_webmerc(coords[:, 0], coords[:, 1])
-                    px_, py_ = world_to_pixel(mx, my, gt)
-                    fn = burn_all_touched_line if all_touched else burn_line
-                    fn(arr, px_, py_, float(bv), merge_add=merge_add, visited=visited)
-            elif gtype == W.POINT:
-                mx, my = lonlat_to_webmerc(parts[:, 0], parts[:, 1])
-                px_, py_ = world_to_pixel(mx, my, gt)
-                burn_points(arr, px_, py_, float(bv), merge_add=merge_add)
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "tx": [tx],
-                "ty": [ty],
-                "band": [1],
-                "data": [arr.tobytes()],
-                "dtype": [dtype],
-                "nodata": [0.0],
-            }
-        )
-
-    return (
-        feats.select("tx", "ty", "_feature_seq", geom_col, burn_value_col)
-        .groupBy("tx", "ty")
-        .applyInPandas(burn_tile, TILE_SCHEMA)
-    )
-
-
 def rasterize_wkb_grid(
     features: DataFrame,
     gt: tuple[float, ...],
@@ -312,7 +220,6 @@ def rasterize_wkb_grid(
     dtype: str = "float64",
     merge_add: bool = False,
     all_touched: bool = False,
-    salt: int | None = None,
 ) -> DataFrame:
     """GDALRasterizeLayers analog onto an arbitrary target grid: burn
     WKB polygon features into a ``width × height`` raster defined by a
@@ -328,19 +235,8 @@ def rasterize_wkb_grid(
 
     ``merge_add=False`` (REPLACE) burns in deterministic
     ``_feature_seq`` order; ``merge_add=True`` (ADD) is order-free.
-
-    ``salt`` > 1 splits each block's feature list across ``salt``
-    reducers keyed by ``_feature_seq % salt`` — the skew escape for a
-    hot block covered by a large share of all features.  ADD partials merge by vectorized sum;
-    REPLACE partials additionally burn each feature's sequence number
-    into a parallel array with the same kernels, and the merge keeps
-    the per-pixel value of the HIGHEST sequence — exactly the
-    last-writer order the single-phase plan burns in.  Features are
-    never split across salts, so within-feature semantics (line
-    ``visited`` sets, ring nesting) are untouched; parity with the
-    single-phase plan is bitwise (tests/test_rasterize_salted.py).
-    Sequence numbers ride float64 arrays — exact below 2^53, far above
-    any realistic feature count."""
+    Every block equals the whole-raster burn cropped to it
+    (tests/test_rasterize_wkb_grid.py)."""
     ntx = (width + tile_size - 1) // tile_size
     nty = (height + tile_size - 1) // tile_size
 
@@ -371,15 +267,13 @@ def rasterize_wkb_grid(
         .drop("_tile")
     )
 
-    def _burn(key, pdf: pd.DataFrame, seqarr: np.ndarray | None) -> np.ndarray:
+    def burn_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
         nx = min(tile_size, width - tx * tile_size)
         ny = min(tile_size, height - ty * tile_size)
         arr = np.zeros((ny, nx), dtype=np.dtype(dtype))
         pdf = pdf.sort_values("_feature_seq")
-        for blob, bv, seq in zip(
-            pdf[geom_col], pdf[burn_value_col], pdf["_feature_seq"]
-        ):
+        for blob, bv in zip(pdf[geom_col], pdf[burn_value_col]):
             gtype, parts = W.parse_wkb(bytes(blob))
             if gtype in (W.LINESTRING, W.MULTILINESTRING):
                 lines = [parts] if gtype == W.LINESTRING else [p for _, p in parts]
@@ -391,11 +285,6 @@ def rasterize_wkb_grid(
                         arr, px_ - tx * tile_size, py_ - ty * tile_size, float(bv),
                         merge_add=merge_add, visited=visited if merge_add else None,
                     )
-                    if seqarr is not None:
-                        line_fn(
-                            seqarr, px_ - tx * tile_size, py_ - ty * tile_size,
-                            float(seq) + 1.0, merge_add=False,
-                        )
                 continue
             for rings in W.polygon_rings(bytes(blob)):
                 pix_rings = []
@@ -405,69 +294,18 @@ def rasterize_wkb_grid(
                         np.column_stack([px_ - tx * tile_size, py_ - ty * tile_size])
                     )
                 burn_polygon(arr, pix_rings, float(bv), merge_add=merge_add)
-                if seqarr is not None:
-                    burn_polygon(seqarr, pix_rings, float(seq) + 1.0, merge_add=False)
-        return arr
+        return pd.DataFrame(
+            {
+                "z": [0], "tx": [tx], "ty": [ty], "band": [1],
+                "data": [arr.tobytes()], "dtype": [dtype], "nodata": [0.0],
+            }
+        )
 
-    def _row(tx, ty, arr, extra=None):
-        d = {
-            "z": [0], "tx": [tx], "ty": [ty], "band": [1],
-            "data": [arr.tobytes()], "dtype": [dtype], "nodata": [0.0],
-        }
-        if extra:
-            d.update(extra)
-        return pd.DataFrame(d)
-
-    def burn_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = _burn(key, pdf, None)
-        return _row(int(key[0]), int(key[1]), arr)
-
-    keyed = feats.select("tx", "ty", "_feature_seq", geom_col, burn_value_col)
-    if not salt or salt <= 1:
-        return keyed.groupBy("tx", "ty").applyInPandas(burn_tile, TILE_SCHEMA)
-
-    partial_schema = T.StructType(
-        TILE_SCHEMA.fields
-        + [T.StructField("salt", T.IntegerType()), T.StructField("seq", T.BinaryType())]
+    return (
+        feats.select("tx", "ty", "_feature_seq", geom_col, burn_value_col)
+        .groupBy("tx", "ty")
+        .applyInPandas(burn_tile, TILE_SCHEMA)
     )
-
-    def burn_partial(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tx, ty = int(key[0]), int(key[1])
-        nx = min(tile_size, width - tx * tile_size)
-        ny = min(tile_size, height - ty * tile_size)
-        seqarr = None if merge_add else np.zeros((ny, nx), dtype=np.float64)
-        arr = _burn(key[:2], pdf, seqarr)
-        return _row(tx, ty, arr, {
-            "salt": [int(key[2])],
-            "seq": [b"" if seqarr is None else seqarr.tobytes()],
-        })
-
-    def merge_partials(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("salt")
-        dt = np.dtype(pdf["dtype"].iloc[0])
-        acc = np.frombuffer(pdf["data"].iloc[0], dtype=dt).copy()
-        if merge_add:
-            for blob in pdf["data"].iloc[1:]:
-                acc += np.frombuffer(blob, dtype=dt)
-        else:
-            acc_seq = np.frombuffer(pdf["seq"].iloc[0], dtype=np.float64).copy()
-            for blob, sblob in zip(pdf["data"].iloc[1:], pdf["seq"].iloc[1:]):
-                v = np.frombuffer(blob, dtype=dt)
-                s = np.frombuffer(sblob, dtype=np.float64)
-                newer = s > acc_seq
-                acc[newer] = v[newer]
-                acc_seq[newer] = s[newer]
-        out = pdf.iloc[:1].drop(columns=["salt", "seq"]).copy()
-        out["data"] = [acc.tobytes()]
-        return out
-
-    salted = keyed.withColumn(
-        "_salt", F.pmod(F.col("_feature_seq"), F.lit(int(salt))).cast("int")
-    )
-    partials = salted.groupBy("tx", "ty", "_salt").applyInPandas(
-        burn_partial, partial_schema
-    )
-    return partials.groupBy("tx", "ty").applyInPandas(merge_partials, TILE_SCHEMA)
 
 
 def tiles_to_features(

@@ -63,27 +63,6 @@ def cosine_topk(
     )
 
 
-def hyperplane_lsh_buckets(
-    vectors: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane sign-bit bucket id per vector (the ANN scale
-    path: candidates only from the same bucket, ~2^-n_planes of the
-    corpus).  Hyperplanes are seeded and stamped into the plan as
-    literals, so every executor derives identical buckets."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bucket = F.lit(0).cast("long")
-    for j in range(n_planes):
-        coeffs = F.array(*[F.lit(float(c)) for c in planes[j]])
-        proj = _dot(F.col(vec_col), coeffs)
-        bucket = bucket + F.when(proj > 0, F.lit(1 << j)).otherwise(0)
-    return vectors.withColumn("bucket", bucket)
-
-
 def ann_ivf(
     vectors: DataFrame,
     k: int = 5,
@@ -414,11 +393,12 @@ def hyperplane_lsh_buckets_int(
     seed: int = 42,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """`hyperplane_lsh_buckets` on the EXACT integer lattice: quantized
-    vectors against quantized planes (both ×1000 round-half-up), sign
-    bits as the bucket id.  Same scale shape (bucket equi-join keys);
-    now oracle-replayable because every projection is an exact integer
-    and proj > 0 has one bit-stable answer."""
+    """Random-hyperplane sign-bit bucket id per vector (the ANN scale
+    path: candidates only from the same bucket, ~2^-n_planes of the
+    corpus) on the EXACT integer lattice: quantized vectors against
+    quantized seeded planes (both ×1000 round-half-up), sign bits as
+    the bucket id.  Oracle-replayable because every projection is an
+    exact integer and proj > 0 has one bit-stable answer."""
     planes_q = lsh_planes_int(n_planes, dim, seed)
     qv = _quantize_udf()(F.col(vec_col))
     out = vectors.withColumn("_qv", qv)

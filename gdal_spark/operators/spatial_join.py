@@ -5,22 +5,26 @@ Re-creates the reference's spatial-filter join (iterate one layer with
 loop join over its quadtree/R-tree, ogrlayer.cpp:3492-3618 + 4004-4076)
 as the idiomatic Spark two-phase plan:
 
-  phase 0  polygon side → cell cover set at res R (driver-side for the
-           broadcastable case; it is per-polygon metadata, not data)
-  phase 1  points.join(broadcast(cover), on=cell)  — hash join, no
-           shuffle of the big side beyond its scan
+  phase 0  polygon side → cell cover set at res R
+  phase 1  points.join(cover, on=cell)  — hash join
   phase 2  exact PIP pandas UDF on the candidates (vectorized kernel,
            grouped by polygon inside each Arrow batch)
 
-Skew: web-scale point sets pile onto a few metro cells.  With
-``salt_factor > 1`` hot cells are split point-side into K sub-keys and
-the cover side is exploded K× — a deterministic pre-salt that
-complements AQE's runtime skew splitting (both are on).
+One phase-1 plan per polygon-side kind:
 
-At 10^12 rows the phase-1 join is the only wide dependency, and it is
-broadcast — the point table is never shuffled; candidates flow
-straight from the scan through the UDF filter (verify with
-.explain(): one BroadcastHashJoin, no Exchange on the point side).
+- list side (a small dim): the cover is per-polygon metadata built on
+  the driver and broadcast — one BroadcastHashJoin, no Exchange on the
+  point side, so candidates flow straight from the scan through the
+  UDF filter at any row count.
+- DataFrame side (a polygon table too large for the driver): the cover
+  is computed distributedly and the join is a shuffle-hash join on
+  ``cell`` that builds its hash table on the cover.
+
+Skew: web-scale point sets pile onto a few metro cells.  The broadcast
+join has no shuffle, so it cannot skew; the shuffle-hash join leaves
+hot cells to AQE's skew-join split (``spark.sql.adaptive.skewJoin``),
+which splits an oversized point-side partition and replicates the
+matching cover partition (tests/test_spatial_join_skew.py).
 """
 
 from __future__ import annotations
@@ -83,18 +87,31 @@ def with_cell_kernel(points: DataFrame, lon="lon", lat="lat", res: int = DEFAULT
     return points.withColumn(out, enc(F.col(lon), F.col(lat)))
 
 
+def _cover_schema(poly_id_col: str) -> T.StructType:
+    return T.StructType(
+        [
+            T.StructField("cell", T.LongType()),
+            T.StructField(poly_id_col, T.LongType()),
+            T.StructField("_poly_wkb", T.BinaryType()),
+        ]
+    )
+
+
+def _cover_rows(pid, blob: bytes, res: int) -> list[tuple]:
+    """One polygon's (cell, poly_id, wkb) cover rows: every res-R cell
+    any of its parts' rings touch (superset cover; the exact phase
+    removes false positives)."""
+    cover: set[int] = set()
+    for rings in W.polygon_rings(blob):
+        cover.update(cells_cover_polygon(rings, res).tolist())
+    return [(int(c), pid, blob) for c in cover]
+
+
 def polygon_cover(polys: list[tuple], res: int = DEFAULT_RES) -> list[tuple]:
-    """[(poly_id, wkb)] → [(cell, poly_id, wkb)] cover rows (superset
-    cover; exact phase removes false positives).  Driver-side — for the
-    broadcastable small-dim case only; big polygon tables use
-    ``polygon_cover_df``."""
-    rows = []
-    for pid, blob in polys:
-        cover: set[int] = set()
-        for rings in W.polygon_rings(blob):
-            cover.update(cells_cover_polygon(rings, res).tolist())
-        rows.extend((int(c), pid, blob) for c in cover)
-    return rows
+    """[(poly_id, wkb)] → [(cell, poly_id, wkb)] cover rows, computed
+    on the driver — the list (broadcast) polygon side.  Big polygon
+    tables use ``polygon_cover_df``."""
+    return [row for pid, blob in polys for row in _cover_rows(pid, blob, res)]
 
 
 def polygon_cover_df(
@@ -106,63 +123,19 @@ def polygon_cover_df(
     """DataFrame-native cell cover: (poly_id, wkb) rows → (cell,
     poly_id, _poly_wkb) cover rows via a batched pandas UDF — the
     cover of a MILLIONS-of-features polygon table is computed where
-    the features live, never on the driver.  Same superset-cover
-    contract as ``polygon_cover``."""
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField(poly_id_col, T.LongType()),
-            T.StructField("_poly_wkb", T.BinaryType()),
-        ]
-    )
+    the features live, never on the driver.  Same rows as
+    ``polygon_cover``."""
 
     def gen(pdf_iter):
         for pdf in pdf_iter:
-            rows = []
-            for pid, blob in zip(pdf[poly_id_col], pdf[wkb_col]):
-                cover: set[int] = set()
-                for rings in W.polygon_rings(bytes(blob)):
-                    cover.update(cells_cover_polygon(rings, res).tolist())
-                rows.extend((int(c), int(pid), bytes(blob)) for c in cover)
+            rows = [
+                row
+                for pid, blob in zip(pdf[poly_id_col], pdf[wkb_col])
+                for row in _cover_rows(int(pid), bytes(blob), res)
+            ]
             yield pd.DataFrame(rows, columns=["cell", poly_id_col, "_poly_wkb"])
 
-    return polys.mapInPandas(gen, schema)
-
-
-def auto_salt_map(
-    pts_with_cell: DataFrame,
-    cover_cells: set[int],
-    sample_fraction: float = 0.01,
-    target_rows_per_key: int = 2_000_000,
-    max_salt: int = 64,
-    cell_col: str = "cell",
-) -> dict[int, int]:
-    """Per-cell salt factors from a sampled cell histogram — replaces
-    the guessed global ``salt_factor`` constant.
-
-    One cheap pass: sample the point table (0.1–1%), count per cover
-    cell, scale up by 1/fraction, and give each cell whose estimate
-    exceeds ``target_rows_per_key`` a split factor
-    ``ceil(est / target)`` (clamped to ``max_salt``).  Hot cells are by
-    definition few — the web's point mass piles onto metro cells — so
-    the result is a small driver-side dict that broadcasts with the
-    cover.  Cold cells stay unsalted: a global constant K would
-    explode the ENTIRE cover K× and shuffle K candidate sub-keys for
-    every cell, paying the skew tax everywhere to fix it in a few
-    places."""
-    hist = (
-        pts_with_cell.sample(fraction=sample_fraction, seed=7)
-        .filter(F.col(cell_col).isin(list(cover_cells)))
-        .groupBy(cell_col)
-        .count()
-        .collect()
-    )
-    out = {}
-    for r in hist:
-        est = r["count"] / sample_fraction
-        if est > target_rows_per_key:
-            out[int(r[cell_col])] = min(int(np.ceil(est / target_rows_per_key)), max_salt)
-    return out
+    return polys.mapInPandas(gen, _cover_schema(poly_id_col))
 
 
 def spatial_join_points_in_polygons(
@@ -172,112 +145,31 @@ def spatial_join_points_in_polygons(
     lat: str = "lat",
     res: int = DEFAULT_RES,
     include_boundary: bool = True,
-    salt_factor: int | str = 1,
     poly_id_col: str = "poly_id",
-    broadcast_cover: bool = True,
-    salt_sample_fraction: float = 0.01,
-    salt_target_rows_per_key: int = 2_000_000,
 ) -> DataFrame:
     """points × polygon set → matching (point row, poly_id) rows.
 
-    ``polys``: [(poly_id, wkb_bytes)] for a broadcastable small dim, or
-    a DataFrame with columns (poly_id_col, geom) for polygon tables too
-    large for the driver — the cover then comes from
-    ``polygon_cover_df`` (computed distributedly).
+    The polygon side's type picks the plan:
 
-    Join strategy (the scale decision):
-
-    - ``broadcast_cover=True`` (default) — the cover set rides to every
-      executor; ONE BroadcastHashJoin, the point table is never
-      shuffled.  Salting is pointless here (there is no shuffle whose
-      keys could skew), so ``salt_factor`` is ignored.
-    - ``broadcast_cover=False`` — the cover is a DataFrame and the join
-      is a shuffle hash join on ``cell``: the path for polygon sets too
-      large to broadcast.  Here hot metro cells DO skew the exchange,
-      and ``salt_factor > 1`` splits each cover cell into K sub-keys
-      while points pick one pseudo-randomly — the north rule's salted
-      repartition (AQE skew-join splitting stays on as the runtime
-      backstop).
-    - ``salt_factor="auto"`` — per-cell factors measured from a sampled
-      cell histogram (``auto_salt_map``): only cells estimated above
-      ``salt_target_rows_per_key`` are split, proportionally to their
-      mass; the rest of the cover is not exploded.
+    - ``[(poly_id, wkb_bytes)]`` — a small dim.  Its cover is computed
+      on the driver (``polygon_cover``) and broadcast: ONE
+      BroadcastHashJoin on ``cell``, the point table is never shuffled.
+    - a DataFrame with columns (``poly_id_col``, geom) — a polygon
+      table too large for the driver.  Its cover is computed where the
+      features live (``polygon_cover_df``) and the join is one
+      shuffle-hash join on ``cell`` that builds its hash table on the
+      cover side; AQE's skew-join split handles hot cells.
     """
-    spark = points.sparkSession
     pts = with_cell(points, lon, lat, res)
     if isinstance(polys, DataFrame):
-        # big polygon side: cover computed distributedly where the
-        # features live (polygon_cover_df); auto-salt needs the cover
-        # cell set — derived from a cover aggregation, not the driver
         cover = polygon_cover_df(polys, res, poly_id_col=poly_id_col)
-        cover_rows = None
+        joined = pts.join(cover.hint("shuffle_hash"), "cell")
     else:
-        cover_rows = polygon_cover(polys, res)
-        cover_schema = T.StructType(
-            [
-                T.StructField("cell", T.LongType()),
-                T.StructField(poly_id_col, T.LongType()),
-                T.StructField("_poly_wkb", T.BinaryType()),
-            ]
+        cover = local_df(
+            points.sparkSession, polygon_cover(polys, res), _cover_schema(poly_id_col)
         )
-        cover = local_df(spark, cover_rows, cover_schema)
-
-    if broadcast_cover:
         joined = pts.join(F.broadcast(cover), "cell")
-        salted = False
-    elif salt_factor == "auto":
-        # per-cell factors from the sampled histogram; cold cells k=1
-        if cover_rows is not None:
-            cover_cells = {c for c, _, _ in cover_rows}
-        else:
-            cover_cells = {
-                r["cell"] for r in cover.select("cell").distinct().collect()
-            }
-        kmap = auto_salt_map(
-            pts,
-            cover_cells,
-            sample_fraction=salt_sample_fraction,
-            target_rows_per_key=salt_target_rows_per_key,
-        )
-        if not kmap:
-            joined = pts.hint("shuffle_hash").join(cover, "cell")
-            salted = False
-        else:
-            kdf = F.broadcast(
-                local_df(spark, list(kmap.items()), "cell long, _k int")
-            )
-            pts = pts.join(kdf, "cell", "left").withColumn(
-                "_salt",
-                F.when(
-                    F.col("_k").isNotNull(),
-                    F.pmod(F.hash(F.col(lon), F.col(lat)), F.col("_k")),
-                ).otherwise(F.lit(0)).cast("int"),
-            ).drop("_k")
-            cover = (
-                cover.join(kdf, "cell", "left")
-                .withColumn("_k", F.coalesce(F.col("_k"), F.lit(1)))
-                .withColumn(
-                    "_salt", F.explode(F.sequence(F.lit(0), F.col("_k") - 1))
-                )
-                .withColumn("_salt", F.col("_salt").cast("int"))
-                .drop("_k")
-            )
-            joined = pts.hint("shuffle_hash").join(cover, ["cell", "_salt"])
-            salted = True
-    elif salt_factor > 1:
-        cover = cover.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1)))
-        ).withColumn("_salt", F.col("_salt").cast("int"))
-        pts = pts.withColumn(
-            "_salt", (F.abs(F.hash(F.col(lon), F.col(lat))) % salt_factor).cast("int")
-        )
-        joined = pts.hint("shuffle_hash").join(cover, ["cell", "_salt"])
-        salted = True
-    else:
-        joined = pts.hint("shuffle_hash").join(cover, "cell")
-        salted = False
 
     pred = st_intersects_point if include_boundary else st_contains_point
     out = joined.filter(pred(F.col("_poly_wkb"), F.col(lon), F.col(lat)))
-    drop = ["_poly_wkb", "cell"] + (["_salt"] if salted else [])
-    return out.drop(*drop)
+    return out.drop("_poly_wkb", "cell")

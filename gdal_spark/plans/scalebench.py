@@ -52,6 +52,7 @@ def run_level(cores: int, input_path: str) -> dict:
     from gdal_spark.operators.rasterize import rasterize_points
     from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
     from gdal_spark.plans.pipeline import metro_zones
+    from gdal_spark.session import local_df
     from gdal_spark.sources.pages import geocode_encode
 
     spark = get_spark(
@@ -95,21 +96,23 @@ def run_level(cores: int, input_path: str) -> dict:
 
     # Iteration 0 is the warmup (JVM heap growth, JIT, and the lazy
     # spawn of one Python worker per core are one-time costs a
-    # long-lived cluster never pays per-job).  The salted-shuffle zone
-    # join runs ONCE here, untimed, as the row-parity check against the
-    # broadcast plan — the timed job uses only the plan you'd actually
-    # deploy (one join), so the measurement has fewer latency-bound
-    # stages to absorb a bad host window.  Then 3 timed iterations;
-    # steady state = the MIN (the host throttles in bursts — observed
-    # 3-4x swings between identical runs — and the min is the
-    # unthrottled measurement).
+    # long-lived cluster never pays per-job).  The zone join with the
+    # zones as a DataFrame (the shuffle-hash plan) runs ONCE here,
+    # untimed, as the row-parity check against the broadcast plan —
+    # the timed job uses only the plan you'd actually deploy (one
+    # join), so the measurement has fewer latency-bound stages to
+    # absorb a bad host window.  Then 3 timed iterations; steady
+    # state = the MIN (the host throttles in bursts — observed 3-4x
+    # swings between identical runs — and the min is the unthrottled
+    # measurement).
     _, _, n_warm, _ = run_once()
     geo_warm = spark.read.parquet(input_path + "_geo")
-    n_salt = spatial_join_points_in_polygons(
-        geo_warm.select("page_id", "lon", "lat"), metro_zones(), poly_id_col="zone_id",
-        broadcast_cover=False, salt_factor=8,
+    n_shuffle = spatial_join_points_in_polygons(
+        geo_warm.select("page_id", "lon", "lat"),
+        local_df(spark, metro_zones(), "zone_id long, geom binary"),
+        poly_id_col="zone_id",
     ).count()
-    assert n_salt == n_warm, (n_salt, n_warm)
+    assert n_shuffle == n_warm, (n_shuffle, n_warm)
     iters = [run_once() for _ in range(3)]
     wall, stages, n_joined, n_tiles = min(iters, key=lambda r: r[0])
 

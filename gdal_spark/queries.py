@@ -598,9 +598,11 @@ def q25(spark, sf_dir):
     return tiles_to_features(tiles, tile_size=32, nodata=0.0)
 
 
-# q26 rects: integer-cornered, pairwise-disjoint with >=2px gaps, laid
-# out on a 16px lattice so many cross the 32px block borders — the
-# cross-tile union-find merge is what's under test.
+# q26 rects: integer-cornered, pairwise-disjoint with >=2px gaps, one
+# per cell of a 16px lattice.  Each rect stays inside its cell (at most
+# 11px from a cell origin offset 2-3px), so none crosses a 32px block
+# border and the cross-tile label graph is empty here; the cross-tile
+# merge is tested with fixtures that do cross (tests/test_polygonize_*).
 Q26_RECTS_SQL = (
     "SELECT CAST(n_nationkey + 1 AS DOUBLE) AS dn, "
     "CAST((n_nationkey%8)*16 + 2 AS BIGINT) AS x0, "
@@ -1835,10 +1837,13 @@ def q51(spark, sf_dir):
     kind="operator",
 )
 def q52(spark, sf_dir):
-    """Full GDALPolygonize with CROSS-TILE dissolved geometry: the q26
-    rects straddle 32px block borders; boundary arcs stitch by
-    opposite-direction cancellation of shared-border segments, and the
-    dissolved rings must recover the exact rects."""
+    """Full GDALPolygonize with dissolved geometry: the dissolved rings
+    must recover the exact q26 rects.  Every q26 rect lies inside one
+    16px cell of the 32px block grid, so no region here crosses a
+    block border.  The cross-block stitch (boundary arcs cancelling
+    along shared block borders) is exercised by
+    tests/test_polygonize_dissolved.py (a donut and an L spanning 2×2
+    blocks); cross-block label merges by tests/test_polygonize_8conn.py."""
     from gdal_spark.operators.polygonize import polygonize_dissolved
 
     feats = local_df(spark, 
@@ -4356,8 +4361,8 @@ def q124(spark, sf_dir):
     """The spatial join with a DATAFRAME polygon side: the cell cover
     is computed distributedly (polygon_cover_df pandas UDF over the
     polygon table — the millions-of-features path), shuffle-hash join
-    on cell, exact PIP verify.  Must equal q11's broadcast-list path
-    row for row (same oracle)."""
+    on cell with the hash table built on the cover, exact PIP verify.
+    Must equal q11's broadcast-list path row for row (same oracle)."""
     from gdal_spark.kernels import wkb as Wk
 
     pts = _points(spark, sf_dir)
@@ -4381,8 +4386,7 @@ def q124(spark, sf_dir):
 
     zones = n.mapInPandas(mk, "zone_id long, geom binary")
     j = spatial_join_points_in_polygons(
-        pts, zones, include_boundary=True, poly_id_col="zone_id",
-        broadcast_cover=False,
+        pts, zones, include_boundary=True, poly_id_col="zone_id"
     )
     return j.select("doc_id", "zone_id")
 

@@ -44,7 +44,7 @@ _WORDS = (
 _LANGS = ["en", "en", "en", "es", "de", "fr", "zh"]
 
 # (name, lon, lat, zipf weight) — weights make the first cities hot:
-# the deliberate skew generator for the salted-join path.
+# the deliberate skew generator (hot metro cells and tiles).
 CITIES = [
     ("nyc", -73.98, 40.75),
     ("london", -0.12, 51.50),

@@ -70,7 +70,7 @@ def stream_density_tiles(
 
 def compact_tiles(spark: SparkSession, snapshot_paths: list[str]) -> DataFrame:
     """Sum the partial-tile snapshots per (tx, ty) — the periodic
-    compaction job; ADD-merge identical to the salted burn's phase 2."""
+    compaction job; snapshots ADD-merge by per-pixel sum."""
     from gdal_spark.operators.rasterize import TILE_SCHEMA
 
     parts = spark.read.parquet(*snapshot_paths)

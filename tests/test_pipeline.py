@@ -18,6 +18,7 @@ from gdal_spark.operators.spatial_join import (
     with_cell_kernel,
 )
 from gdal_spark.plans.pipeline import metro_zones, run_pipeline
+from gdal_spark.session import local_df
 from gdal_spark.sources.pages import geocode_encode, synth_pages, synth_pages_pdf
 
 N_PAGES = 20_000
@@ -137,23 +138,21 @@ def test_text_byte_identical_per_url(spark, pipe):
         assert ref["text"].encode() == row["text"].encode()
 
 
-def test_join_broadcast_vs_salted_shuffle_parity(spark):
-    """The three physical strategies (broadcast / shuffle / salted
-    shuffle) must produce identical logical output."""
+def test_join_list_vs_dataframe_side_parity(spark):
+    """The two physical plans — the zones as a list (broadcast cover)
+    and the same zones as a DataFrame (shuffle-hash join on the
+    distributed cover) — produce identical logical output."""
     pages = synth_pages(spark, 3000, partitions=4)
     geo = geocode_encode(pages).select("page_id", "lon", "lat")
     zones = metro_zones()
     a = spatial_join_points_in_polygons(geo, zones, poly_id_col="zone_id")
     b = spatial_join_points_in_polygons(
-        geo, zones, poly_id_col="zone_id", broadcast_cover=False, salt_factor=4
-    )
-    c = spatial_join_points_in_polygons(
-        geo, zones, poly_id_col="zone_id", broadcast_cover=False, salt_factor=1
+        geo, local_df(spark, zones, "zone_id long, geom binary"),
+        poly_id_col="zone_id",
     )
     pa = sorted(map(tuple, a.select("page_id", "zone_id").collect()))
     pb = sorted(map(tuple, b.select("page_id", "zone_id").collect()))
-    pc = sorted(map(tuple, c.select("page_id", "zone_id").collect()))
-    assert pa == pb == pc
+    assert pa == pb
     assert len(pa) > 0
 
 

@@ -77,20 +77,6 @@ def test_groupby_has_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_salted_shuffle_join_has_no_broadcast(spark):
-    pts = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id",
-        (((F.col("doc_id") * 9973) % 36000) / 100.0 - 180.0).alias("lon"),
-        (((F.col("doc_id") * 7919) % 16000) / 100.0 - 80.0).alias("lat"),
-    )
-    j = spatial_join_points_in_polygons(
-        pts, metro_zones(), poly_id_col="zone_id",
-        broadcast_cover=False, salt_factor=4,
-    )
-    plan = plan_of(j)
-    assert "ShuffledHashJoin" in plan
-
-
 def test_warp_mapping_join_no_cartesian(spark):
     """warp's dst-tile → src-tile mapping is a pure equi-join (no
     BroadcastNestedLoop / Cartesian), and the mapping side is computed
@@ -132,7 +118,10 @@ def test_mosaic_single_shuffle_on_tile_key(spark):
 
 def test_df_cover_join_is_shuffle_hash_not_cartesian(spark):
     """The DataFrame-polygon-side join (polygon_cover_df path) must be
-    an equi-join on cell (shuffle-hash), never a cartesian product."""
+    an equi-join on cell (shuffle-hash) that builds its hash table on
+    the cover side, never a cartesian product."""
+    import re
+
     import numpy as np
     import pandas as pd
 
@@ -160,12 +149,12 @@ def test_df_cover_join_is_shuffle_hash_not_cartesian(spark):
         spark.read.parquet(f"{SF}/documents.parquet")
         .select("doc_id").limit(5).mapInPandas(mk, "zone_id long, geom binary")
     )
-    j = spatial_join_points_in_polygons(
-        pts, zones, poly_id_col="zone_id", broadcast_cover=False
-    )
+    j = spatial_join_points_in_polygons(pts, zones, poly_id_col="zone_id")
     plan = plan_of(j)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
+    # the hash table is built on the cover, not on the points
+    assert "ShuffledHashJoin [cell#" in re.sub(r"#\d+L?", "#", plan)
+    assert "BuildRight" in plan and "BuildLeft" not in plan
 
 
 def test_pyramid_convolution_single_exchange(spark):

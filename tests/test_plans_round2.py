@@ -37,7 +37,7 @@ def test_point_burn_pixel_aggregate_plan(spark):
     pix_ex = tile_ex[1][0]
     assert "HashAggregate" in lines[pix_ex + 1]
     assert "partial_count" in lines[pix_ex + 1]
-    assert "_salt" not in plan
+    assert "salt" not in plan
     assert "CartesianProduct" not in plan
 
 
