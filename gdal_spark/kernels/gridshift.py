@@ -156,15 +156,26 @@ def parse_ntv2(blob: bytes) -> list[SubGrid]:
     return grids
 
 
-def _pick(grids: list[SubGrid], lat_sec: float, lonw_sec: float):
-    best = None
-    for g in grids:
-        if (g.s_lat <= lat_sec <= g.n_lat
-                and g.e_long <= lonw_sec <= g.w_long):
-            if best is None or (g.lat_inc * g.long_inc
-                                < best.lat_inc * best.long_inc):
-                best = g
-    return best
+def _pick(grids: list[SubGrid], lat_s: np.ndarray,
+          lonw_s: np.ndarray) -> np.ndarray:
+    """Index into ``grids`` of each point's subgrid, -1 outside all:
+    one mask per subgrid in list order; the densest containing subgrid
+    wins, and on a tie the first one listed (NaN is inside none)."""
+    pick = np.full(len(lat_s), -1)
+    best = np.full(len(lat_s), np.inf)
+    for k, g in enumerate(grids):
+        area = g.lat_inc * g.long_inc
+        m = ((g.s_lat <= lat_s) & (lat_s <= g.n_lat)
+             & (g.e_long <= lonw_s) & (lonw_s <= g.w_long) & (area < best))
+        pick[m] = k
+        best[m] = area
+    return pick
+
+
+def _bilinear(v: np.ndarray, iy: np.ndarray, ix: np.ndarray,
+              fy: np.ndarray, fx: np.ndarray) -> np.ndarray:
+    return ((1 - fy) * ((1 - fx) * v[iy, ix] + fx * v[iy, ix + 1])
+            + fy * ((1 - fx) * v[iy + 1, ix] + fx * v[iy + 1, ix + 1]))
 
 
 def shift_points(grids: list[SubGrid], lon_deg: np.ndarray,
@@ -175,30 +186,26 @@ def shift_points(grids: list[SubGrid], lon_deg: np.ndarray,
     subgrid.  The interpolation is the standard bilinear
     s = (1-fy)((1-fx) v00 + fx v01) + fy((1-fx) v10 + fx v11)
     over the enclosing cell with col index growing WESTWARD; the
-    returned lon shift is negated into the east-positive sense."""
-    n = len(lon_deg)
-    dlat = np.full(n, np.nan)
-    dlon = np.full(n, np.nan)
-    for i in range(n):
-        lat_s = float(lat_deg[i]) * 3600.0
-        lonw_s = -float(lon_deg[i]) * 3600.0  # east-pos -> west-pos
-        g = _pick(grids, lat_s, lonw_s)
-        if g is None:
+    returned lon shift is negated into the east-positive sense.
+    Vectorized per subgrid; every float64 operation is the scalar
+    rule's, in its order, so results are bitwise those of a per-point
+    loop."""
+    lat_s = np.asarray(lat_deg, dtype=np.float64) * 3600.0
+    lonw_s = -np.asarray(lon_deg, dtype=np.float64) * 3600.0  # east-pos -> west-pos
+    dlat = np.full(len(lat_s), np.nan)
+    dlon = np.full(len(lat_s), np.nan)
+    pick = _pick(grids, lat_s, lonw_s)
+    for k, g in enumerate(grids):
+        sel = np.flatnonzero(pick == k)
+        if not len(sel):
             continue
-        ry = (lat_s - g.s_lat) / g.lat_inc
-        rx = (lonw_s - g.e_long) / g.long_inc
-        iy = min(int(ry), g.nrows - 2)
-        ix = min(int(rx), g.ncols - 2)
+        ry = (lat_s[sel] - g.s_lat) / g.lat_inc
+        rx = (lonw_s[sel] - g.e_long) / g.long_inc
+        iy = np.minimum(ry.astype(np.int64), g.nrows - 2)
+        ix = np.minimum(rx.astype(np.int64), g.ncols - 2)
         fy, fx = ry - iy, rx - ix
-        v = g.lat_shift
-        dlat[i] = ((1 - fy) * ((1 - fx) * v[iy, ix] + fx * v[iy, ix + 1])
-                   + fy * ((1 - fx) * v[iy + 1, ix]
-                           + fx * v[iy + 1, ix + 1]))
-        w = g.lon_shift
-        dl = ((1 - fy) * ((1 - fx) * w[iy, ix] + fx * w[iy, ix + 1])
-              + fy * ((1 - fx) * w[iy + 1, ix]
-                      + fx * w[iy + 1, ix + 1]))
-        dlon[i] = -dl  # west-positive seconds -> east-positive
+        dlat[sel] = _bilinear(g.lat_shift, iy, ix, fy, fx)
+        dlon[sel] = -_bilinear(g.lon_shift, iy, ix, fy, fx)  # west-pos -> east-pos
     return dlat, dlon
 
 

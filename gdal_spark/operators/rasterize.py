@@ -139,9 +139,10 @@ def rasterize_points(
     sums are representable (e.g. dyadic weights).
 
     With ``min_z < z`` (at most ``MAX_FUSED_LEVELS`` below z) the second
-    exchange is on the tiles' ``min_z`` ancestor (atx, aty) instead, and
-    one ``applyInPandas`` call per ancestor assembles each of its base
-    tiles as above, then reduces them level by level with
+    exchange is on the tiles' ``min_z`` ancestor (atx, aty) instead,
+    with each pixel row's base tile sent as its index ``sub`` inside the
+    ancestor, and one ``applyInPandas`` call per ancestor assembles each
+    of its base tiles as above, then reduces them level by level with
     ``pyramid.parent_tile(method="sum")`` — the GDALRegenerateOverviews
     SUM of 2×2 child blocks (gcore/overview.cpp:4302-4774).  Every level
     is byte-identical to chaining ``pyramid_level(method="sum")`` over
@@ -181,13 +182,22 @@ def rasterize_points(
     from gdal_spark.operators.pyramid import parent_tile
 
     shift = z - min_z
+    mask = (1 << shift) - 1
 
     def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pix = pdf["pix"].to_numpy()
         v = pdf["v"].to_numpy(np.float64)
+        if shift == 0:
+            groups = pdf.groupby(["tx", "ty"]).indices.items()
+        else:
+            atx, aty = (int(k) << shift for k in key)
+            groups = (
+                ((atx | (int(sub) >> shift), aty | (int(sub) & mask)), idx)
+                for sub, idx in pdf.groupby("sub").indices.items()
+            )
         level = {
             (int(tx), int(ty)): burn(pix[idx], v[idx]).reshape(tile_size, tile_size)
-            for (tx, ty), idx in pdf.groupby(["tx", "ty"]).indices.items()
+            for (tx, ty), idx in groups
         }
         out = [(z, tx, ty, arr) for (tx, ty), arr in level.items()]
         for lz in range(z - 1, min_z - 1, -1):
@@ -201,12 +211,24 @@ def rasterize_points(
             out += [(lz, tx, ty, arr) for (tx, ty), arr in level.items()]
         return rows(out)
 
-    keys = (
-        ["tx", "ty"]
-        if shift == 0
-        else [F.shiftright("tx", shift).alias("atx"), F.shiftright("ty", shift).alias("aty")]
+    if shift == 0:
+        return pixels.groupBy("tx", "ty").applyInPandas(assemble, TILE_SCHEMA)
+    # The ancestor key rides as child columns, so Arrow sends it once,
+    # and the tile inside it as one byte, sub = (tx & mask) << shift |
+    # (ty & mask) < 4**MAX_FUSED_LEVELS = 64; the keys (< 2**z) and
+    # pix (< tile_size²) fit int32.
+    sub = F.shiftleft(F.col("tx").bitwiseAND(mask), shift).bitwiseOR(F.col("ty").bitwiseAND(mask))
+    return (
+        pixels.select(
+            F.shiftright("tx", shift).cast("int").alias("atx"),
+            F.shiftright("ty", shift).cast("int").alias("aty"),
+            sub.cast("byte").alias("sub"),
+            F.col("pix").cast("int").alias("pix"),
+            "v",
+        )
+        .groupBy("atx", "aty")
+        .applyInPandas(assemble, TILE_SCHEMA)
     )
-    return pixels.groupBy(*keys).applyInPandas(assemble, TILE_SCHEMA)
 
 
 def rasterize_wkb_grid(

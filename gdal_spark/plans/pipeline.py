@@ -6,10 +6,18 @@
   → any coarser pyramid levels, one stage each
   every stage manifest-checkpointed (resume = skip completed stages)
 
+Every stage reads its input with the schema its producer writes
+(``PAGES_SCHEMA``, ``GEOCODE_SCHEMA``, ``TILE_SCHEMA``), so building a
+stage's DataFrame runs no Spark job, and the geocode stage has no
+exchange.  One pipeline job at base_z=8, min_z=5 is six Spark jobs:
+the geocode write, the zone join's broadcast and write, and the burn's
+two shuffle map stages and write.
+
 Scale notes (what changes at 10^12 rows on 1000 executors):
-- stage boundaries are parquet/Iceberg tables partitioned on the next
-  stage's key (cells for the join, z/tx for tiles), so each stage
-  starts from a co-partitioned scan instead of a shuffle;
+- stage boundaries are parquet/Iceberg tables written in their
+  producer's scan order; no stage clusters its output for the next
+  one, because none would use it: the zone join is map-only and the
+  burn shuffles on its own keys;
 - the polygon side is broadcast (cover-set rows, not geometry blobs ×
   points), so the join has no shuffle and no salting;
 - the only big-data shuffle is the tile burn's.  It shuffles per-pixel
@@ -30,15 +38,27 @@ Scale notes (what changes at 10^12 rows on 1000 executors):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from gdal_spark.kernels import wkb as W
 from gdal_spark.operators.pyramid import pyramid_level
-from gdal_spark.operators.rasterize import MAX_FUSED_LEVELS, rasterize_points
-from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons, with_cell
+from gdal_spark.operators.rasterize import MAX_FUSED_LEVELS, TILE_SCHEMA, rasterize_points
+from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
 from gdal_spark.plans.manifest import Manifest
-from gdal_spark.sources.pages import CITIES, geocode, geocode_encode, synth_pages
+from gdal_spark.sources.pages import CITIES, PAGES_SCHEMA, geocode_encode, synth_pages
+
+# The geocode stage's table: page_id and the derived columns only.
+GEOCODE_SCHEMA = T.StructType(
+    [
+        T.StructField("page_id", T.LongType()),
+        T.StructField("lon", T.DoubleType()),
+        T.StructField("lat", T.DoubleType()),
+        T.StructField("cell7", T.LongType()),
+        T.StructField("cell9", T.LongType()),
+    ]
+)
+
 
 # Zone polygons: one rectangle per city metro (deterministic).
 def metro_zones() -> list[tuple]:
@@ -67,7 +87,9 @@ def run_pipeline(
 ) -> dict:
     """Returns {stage: StageResult}; rerun with the same args resumes.
 
-    The ``tiles`` stage writes the base_z tiles and the pyramid levels
+    ``partitions`` shapes only the pages stage (its slice count); the
+    geocode stage is map-only and writes in the pages' scan order.  The
+    ``tiles`` stage writes the base_z tiles and the pyramid levels
     down to base_z - ``MAX_FUSED_LEVELS`` in one job, committed as one
     manifest row per level (``tiles``, ``pyramid_z{z}``, ...); each
     level below that is its own ``pyramid_level`` stage."""
@@ -81,26 +103,19 @@ def run_pipeline(
     results["pages"] = res_pages
 
     def geo_build():
-        pages = spark.read.parquet(res_pages.path)
-        # fused geocode + cell encode: one pandas UDF, one Arrow pass.
+        pages = spark.read.schema(PAGES_SCHEMA).parquet(res_pages.path)
+        # fused geocode + cell encode in JVM expressions, written in the
+        # pages' scan order: no exchange, one pass over the pages.
         # Output is the NARROW derived table (page_id + derived cols):
         # the corpus itself (url/html/text) is never duplicated through
         # derived stages — join back on page_id when it is needed.
-        geo = geocode_encode(pages, res_list=(7, 9)).select(
-            "page_id", "lon", "lat", "cell7", "cell9"
-        )
-        # cluster by cell so the downstream join/tiling scans are
-        # co-located (Hilbert-style spatial clustering via range
-        # partitioning on the cell id)
-        return geo.repartitionByRange(partitions, "cell7")
+        return geocode_encode(pages, res_list=(7, 9)).select(*GEOCODE_SCHEMA.names)
 
-    res_geo = mf.run_stage(
-        spark, "geocode", [res_pages.fp, 7, 9, partitions], geo_build
-    )
+    res_geo = mf.run_stage(spark, "geocode", [res_pages.fp, 7, 9], geo_build)
     results["geocode"] = res_geo
 
     def join_build():
-        geo = spark.read.parquet(res_geo.path)
+        geo = spark.read.schema(GEOCODE_SCHEMA).parquet(res_geo.path)
         return spatial_join_points_in_polygons(
             geo.select("page_id", "lon", "lat"),
             metro_zones(),
@@ -113,7 +128,7 @@ def run_pipeline(
     fused_z = max(min_z, base_z - MAX_FUSED_LEVELS)
 
     def tiles_build():
-        geo = spark.read.parquet(res_geo.path)
+        geo = spark.read.schema(GEOCODE_SCHEMA).parquet(res_geo.path)
         return rasterize_points(geo, z=base_z, min_z=fused_z)
 
     levels = {"tiles": base_z}
@@ -126,7 +141,7 @@ def run_pipeline(
     for z in range(fused_z - 1, min_z - 1, -1):
 
         def level_build(prev_path=prev.path):
-            return pyramid_level(spark.read.parquet(prev_path), method="sum")
+            return pyramid_level(spark.read.schema(TILE_SCHEMA).parquet(prev_path), method="sum")
 
         prev = mf.run_stage(spark, f"pyramid_z{z}", [prev.fp, z], level_build)
         results[f"pyramid_z{z}"] = prev

@@ -49,17 +49,18 @@ def prepare_input(path: str, n_pages: int, partitions: int = 128) -> None:
 def run_level(cores: int, input_path: str) -> dict:
     """One measurement: the full processing job at local[cores]."""
     from gdal_spark import get_spark
-    from gdal_spark.operators.rasterize import rasterize_points
+    from gdal_spark.operators.rasterize import TILE_SCHEMA, rasterize_points
     from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
-    from gdal_spark.plans.pipeline import metro_zones
+    from gdal_spark.plans.pipeline import GEOCODE_SCHEMA, metro_zones
     from gdal_spark.session import local_df
-    from gdal_spark.sources.pages import geocode_encode
+    from gdal_spark.sources.pages import PAGES_SCHEMA, geocode_encode
 
     spark = get_spark(
         "scalebench", cores=cores,
         extra_conf={"spark.local.dir": "/dev/shm/gdal_spark_spill"},
     )
-    pages = spark.read.parquet(input_path)
+    # every read names its schema: no schema-inference job
+    pages = spark.read.schema(PAGES_SCHEMA).parquet(input_path)
     n_pages = pages.count()
 
     def run_once():
@@ -72,11 +73,11 @@ def run_level(cores: int, input_path: str) -> dict:
         # narrow derived table: page_id + derived columns ONLY — the corpus
         # (url, html, text) is never re-written through derived stages;
         # downstream consumers join back on page_id when they need it
-        geo = geo.select("page_id", "lon", "lat", "cell7", "cell9")
+        geo = geo.select(*GEOCODE_SCHEMA.names)
         geo.write.mode("overwrite").parquet(input_path + "_geo")
         stages["geocode_encode"] = time.time() - t0
 
-        geo2 = spark.read.parquet(input_path + "_geo")
+        geo2 = spark.read.schema(GEOCODE_SCHEMA).parquet(input_path + "_geo")
 
         t0 = time.time()
         joined = spatial_join_points_in_polygons(
@@ -90,7 +91,9 @@ def run_level(cores: int, input_path: str) -> dict:
         tiles = rasterize_points(geo2, z=8, min_z=5)
         tiles.write.mode("overwrite").parquet(input_path + "_tiles")
         stages["tile_burn_pyramid_z8_z5"] = time.time() - t0
-        n_tiles = spark.read.parquet(input_path + "_tiles").filter("z = 5").count()
+        n_tiles = (
+            spark.read.schema(TILE_SCHEMA).parquet(input_path + "_tiles").filter("z = 5").count()
+        )
 
         return time.time() - t_all, stages, n_joined, n_tiles
 
@@ -106,7 +109,7 @@ def run_level(cores: int, input_path: str) -> dict:
     # swings between identical runs — and the min is the unthrottled
     # measurement).
     _, _, n_warm, _ = run_once()
-    geo_warm = spark.read.parquet(input_path + "_geo")
+    geo_warm = spark.read.schema(GEOCODE_SCHEMA).parquet(input_path + "_geo")
     n_shuffle = spatial_join_points_in_polygons(
         geo_warm.select("page_id", "lon", "lat"),
         local_df(spark, metro_zones(), "zone_id long, geom binary"),

@@ -150,43 +150,6 @@ def synth_pages(spark: SparkSession, n_rows: int, partitions: int = 32) -> DataF
     return slices.mapInPandas(gen, PAGES_SCHEMA)
 
 
-def geocode(pages: DataFrame) -> DataFrame:
-    """Deterministic text→(lon, lat): city from the first token, jitter
-    from an md5 of the url (pure functions of the row — identical on
-    every rerun and executor).  Vectorized pandas UDF."""
-    city_lon = {c[0]: c[1] for c in CITIES}
-    city_lat = {c[0]: c[2] for c in CITIES}
-
-    @F.pandas_udf(
-        T.StructType(
-            [T.StructField("lon", T.DoubleType()), T.StructField("lat", T.DoubleType())]
-        )
-    )
-    def geo(text: pd.Series, url: pd.Series) -> pd.DataFrame:
-        first = text.str.split(" ", n=1).str[0]
-        base_lon = first.map(city_lon).fillna(0.0).to_numpy()
-        base_lat = first.map(city_lat).fillna(0.0).to_numpy()
-        jit = np.array(
-            [
-                int.from_bytes(hashlib.md5(u.encode()).digest()[:8], "big")
-                for u in url
-            ],
-            dtype=np.uint64,
-        )
-        jlon = ((jit % np.uint64(20001)).astype(np.float64) - 10000.0) / 10000.0 * 0.5
-        jlat = (
-            ((jit >> np.uint64(20)) % np.uint64(20001)).astype(np.float64) - 10000.0
-        ) / 10000.0 * 0.5
-        return pd.DataFrame({"lon": base_lon + jlon, "lat": base_lat + jlat})
-
-    return (
-        pages.withColumn("_g", geo(F.col("text"), F.col("url")))
-        .withColumn("lon", F.col("_g.lon"))
-        .withColumn("lat", F.col("_g.lat"))
-        .drop("_g")
-    )
-
-
 def geocode_encode(
     pages: DataFrame, res_list: tuple[int, ...] = (7, 9), native: bool = True
 ) -> DataFrame:

@@ -136,3 +136,77 @@ def test_inverse_roundtrip():
     lon_b, lat_b = shift_points_inverse(grids, lon_f, lat_f)
     assert np.max(np.abs(lon_b - lon)) < 1e-9
     assert np.max(np.abs(lat_b - lat)) < 1e-9
+
+
+def _shift_points_loop(grids, lon_deg, lat_deg):
+    """The per-point rule shift_points vectorizes: pick the densest
+    containing subgrid (first listed on a tie), then the scalar
+    bilinear."""
+    n = len(lon_deg)
+    dlat = np.full(n, np.nan)
+    dlon = np.full(n, np.nan)
+    for i in range(n):
+        lat_s = float(lat_deg[i]) * 3600.0
+        lonw_s = -float(lon_deg[i]) * 3600.0
+        g = None
+        for c in grids:
+            if (c.s_lat <= lat_s <= c.n_lat and c.e_long <= lonw_s <= c.w_long
+                    and (g is None or c.lat_inc * c.long_inc < g.lat_inc * g.long_inc)):
+                g = c
+        if g is None:
+            continue
+        ry = (lat_s - g.s_lat) / g.lat_inc
+        rx = (lonw_s - g.e_long) / g.long_inc
+        iy = min(int(ry), g.nrows - 2)
+        ix = min(int(rx), g.ncols - 2)
+        fy, fx = ry - iy, rx - ix
+        v = g.lat_shift
+        dlat[i] = ((1 - fy) * ((1 - fx) * v[iy, ix] + fx * v[iy, ix + 1])
+                   + fy * ((1 - fx) * v[iy + 1, ix] + fx * v[iy + 1, ix + 1]))
+        w = g.lon_shift
+        dl = ((1 - fy) * ((1 - fx) * w[iy, ix] + fx * w[iy, ix + 1])
+              + fy * ((1 - fx) * w[iy + 1, ix] + fx * w[iy + 1, ix + 1]))
+        dlon[i] = -dl
+    return dlat, dlon
+
+
+def test_vectorized_bitwise_equals_loop():
+    """Random float32 shifts (not dyadic) over nested subgrids, a tie
+    between equal-area subgrids and a 900" x 400" grid whose area ties
+    none: random points, every node, cell midpoints, subgrid edges and
+    points outside every subgrid (NaN coordinates included)."""
+    rng = np.random.default_rng(11)
+
+    def grid(name, s_lat, n_lat, e_long, w_long, lat_inc, long_inc):
+        shape = (int(round((n_lat - s_lat) / lat_inc)) + 1,
+                 int(round((w_long - e_long) / long_inc)) + 1)
+        return SubGrid(name, s_lat, n_lat, e_long, w_long, lat_inc, long_inc,
+                       rng.normal(0, 3, shape).astype(np.float32),
+                       rng.normal(0, 3, shape).astype(np.float32))
+
+    grids = parse_ntv2(write_ntv2([
+        grid("PARENT", 0.0, 36000.0, -36000.0, 0.0, 3600.0, 3600.0),
+        grid("CHILD", 7200.0, 18000.0, -18000.0, -7200.0, 1200.0, 1200.0),
+        grid("GRANDC", 10800.0, 14400.0, -14400.0, -10800.0, 300.0, 300.0),
+        grid("TIE", 9000.0, 21600.0, -21600.0, -9000.0, 1800.0, 800.0),
+        grid("OVERLAP", 3600.0, 32400.0, -10800.0, -3600.0, 900.0, 400.0),
+    ]))
+    edges_lat, edges_lon = [], []
+    for g in grids:
+        ys = g.s_lat + g.lat_inc * np.arange(g.nrows)
+        xs = g.e_long + g.long_inc * np.arange(g.ncols)
+        ys = np.concatenate([ys, ys[:-1] + g.lat_inc / 2])
+        xs = np.concatenate([xs, xs[:-1] + g.long_inc / 2])
+        yy, xx = np.meshgrid(ys, xs)
+        edges_lat.append(yy.ravel() / 3600.0)
+        edges_lon.append(-xx.ravel() / 3600.0)
+    lat = np.concatenate([rng.uniform(-1, 11, 20_000), *edges_lat,
+                          [np.nan, 2.0, np.nan, 10.0, 10.0 + 1e-12, -1e-12]])
+    lon = np.concatenate([rng.uniform(-1, 11, 20_000), *edges_lon,
+                          [2.0, np.nan, np.nan, 10.0, 5.0, 5.0]])
+    got = shift_points(grids, lon, lat)
+    want = _shift_points_loop(grids, lon, lat)
+    for a, b in zip(got, want):
+        assert a.tobytes() == b.tobytes()
+    inside = ~np.isnan(want[0])
+    assert 0 < inside.sum() < len(lat)

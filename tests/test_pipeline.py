@@ -1,12 +1,13 @@
 """North-rule pipeline guarantees: manifest resume without recompute,
-byte-identical text per url, join-strategy row parity, and
-expression-vs-kernel cell parity."""
+byte-identical text per url, join-strategy row parity,
+expression-vs-kernel cell parity, and the pipeline's Spark job shape."""
 
 from __future__ import annotations
 
 import json
 import os
 import shutil
+import uuid
 
 import numpy as np
 import pytest
@@ -29,6 +30,93 @@ def pipe(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("pipe"))
     results = run_pipeline(spark, N_PAGES, root, base_z=8, min_z=6, partitions=8)
     return root, results
+
+
+def _traced_run(spark, root: str, min_z: int) -> dict:
+    """run_pipeline at base_z=8 with every stage in its own Spark job
+    group: per stage, the jobs its ``build()`` ran, the jobs the whole
+    stage ran, and the DataFrame the build returned."""
+    from gdal_spark.plans import manifest as M
+
+    sc = spark.sparkContext
+    run_id = uuid.uuid4().hex
+    orig = M.Manifest.run_stage
+    seen: dict[str, dict] = {}
+
+    def jobs(group: str) -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run_stage(mf, spark_, stage, fp_parts, build, **kw):
+        stage_group, build_group = f"{run_id}-stage-{stage}", f"{run_id}-build-{stage}"
+        seen[stage] = {}
+
+        def traced_build():
+            sc.setJobGroup(build_group, stage)
+            try:
+                seen[stage]["df"] = build()
+            finally:
+                sc.setJobGroup(stage_group, stage)
+            return seen[stage]["df"]
+
+        sc.setJobGroup(stage_group, stage)
+        try:
+            return orig(mf, spark_, stage, fp_parts, traced_build, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            seen[stage]["build_jobs"] = jobs(build_group)
+            seen[stage]["jobs"] = jobs(stage_group) + seen[stage]["build_jobs"]
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(M.Manifest, "run_stage", run_stage)
+        run_pipeline(spark, N_PAGES, root, base_z=8, min_z=min_z, partitions=8)
+    return seen
+
+
+@pytest.fixture(scope="module")
+def traced(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("traced"))
+    return root, _traced_run(spark, root, min_z=5)
+
+
+def test_stage_builds_run_no_job(spark, traced):
+    """Every stage reads its input with a named schema, so building its
+    DataFrame (before the write) runs no Spark job; that holds for a
+    pyramid level beyond the fused cap too."""
+    root, seen = traced
+    assert set(seen) == {"pages", "geocode", "zone_join", "tiles"}
+    assert {s: v["build_jobs"] for s, v in seen.items()} == dict.fromkeys(seen, 0)
+    beyond = _traced_run(spark, root, min_z=4)  # resumes all but pyramid_z4
+    assert set(beyond) == set(seen) | {"pyramid_z4"}
+    assert "df" in beyond["pyramid_z4"] and beyond["pyramid_z4"]["build_jobs"] == 0
+
+
+def test_geocode_plan_has_no_exchange(traced):
+    """The geocode stage keeps the pages' scan order: no repartition."""
+    _, seen = traced
+    plan = seen["geocode"]["df"]._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+def test_spark_jobs_per_pipeline_job(traced):
+    """One pipeline job past the pages is 6 Spark jobs: the geocode
+    write; the zone join's broadcast and write; the burn's pixel and
+    ancestor shuffle map stages and its write."""
+    _, seen = traced
+    assert {s: v["jobs"] for s, v in seen.items() if s != "pages"} == {
+        "geocode": 1, "zone_join": 2, "tiles": 3,
+    }
+
+
+def test_geocode_schema_is_build_schema(traced):
+    """The schema the join and burn read the geocode table with is the
+    one its build writes (names and types)."""
+    from gdal_spark.plans.pipeline import GEOCODE_SCHEMA
+
+    _, seen = traced
+    built = seen["geocode"]["df"].schema
+    assert [(f.name, f.dataType) for f in GEOCODE_SCHEMA] == [
+        (f.name, f.dataType) for f in built
+    ]
 
 
 def test_pipeline_stages_complete(pipe):
