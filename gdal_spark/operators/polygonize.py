@@ -2,28 +2,33 @@
 
 Reference: GDALPolygonize two-pass scanline CCL + arc tracing
 (alg/polygonize.cpp:73-300) is inherently sequential over the whole
-raster.  The distributed decomposition:
+raster.  The distributed decomposition, shared by ``polygonize_tiles``,
+``polygonize_dissolved`` and ``operators.sieve.sieve_tiles``:
 
-  1. per-tile CCL + region summaries + border runs  (applyInPandas —
-     embarrassingly parallel, the dominant cost)
-  2. border-run equi-join on shared tile edges: facing runs with equal
-     pixel value and overlapping extent ⇒ same global component
-  3. connected components over the (tile, local_label) graph
-     (``_label_roots``): packed (tx, ty, label) node ids through
-     ``graph.connected_components``, whose size gate union-finds a
-     graph that fits the driver (the reference's merge map,
-     gdalrasterpolygonenumerator.cpp:75-167 — milliseconds, no
+  1. per-tile CCL (``_tile_pass``, mapInPandas — embarrassingly
+     parallel, the dominant cost): every (tx, ty, local_label) becomes
+     ONE packed region key ``(tx<<42)|(ty<<21)|label`` (``_pack``),
+     emitted with its region summary and its border runs;
+  2. facing-run join on shared tile edges (``_facing_runs``): facing
+     runs with overlapping extent are in contact; equal pixel value ⇒
+     same global component (sieve keeps the unequal ones as region
+     adjacency);
+  3. connected components over the key graph (``_label_roots``),
+     through ``graph.connected_components``, whose size gate
+     union-finds a graph that fits the driver (the reference's merge
+     map, gdalrasterpolygonenumerator.cpp:75-167 — milliseconds, no
      shuffles) and pointer-jumps in Spark past it (a 100-TB noisy
      raster has billions of border runs).  Both sides root at the
-     lexicographic-min id, so results are bit-identical.
-  4. global region table = per-tile summaries re-keyed by root label
-     (one groupBy), optionally with dissolved geometry per region.
+     smallest key, and packed order is lexicographic (tx, ty, label)
+     order, so results are bit-identical;
+  4. every per-tile row re-keys by root through one left join
+     (``_rooted``; an empty graph's root map folds away), then one
+     groupBy builds the global region table, or the dissolved
+     geometry per region.
 
-Returns regions (root_label, dn, pixel_count, n_tiles).  Per-tile
-polygon geometry (rings incl. holes) is available from
-``extract_polygons`` for tiles that don't cross — the cross-tile
-geometry dissolve (arc stitching) is pixel-edge concatenation over the
-border runs and is kept per-tile here; zonal/count semantics are exact.
+``polygonize_tiles`` returns regions (region_id, dn, pixel_count,
+n_tiles); ``polygonize_dissolved`` the full polygon per region.
+``polygonize_geometry`` traces per-tile polygons only.
 """
 
 from __future__ import annotations
@@ -43,48 +48,108 @@ _LAB_MASK = (1 << _LAB_BITS) - 1
 _TY_MASK = (1 << _TY_BITS) - 1
 
 
-def _enc(tx, ty, lab):
-    """Pack (tx, ty, local_label) into one long: (tx<<42)|(ty<<21)|lab.
-    Supports rasters up to 2^20 tiles per axis (≈ 2.7·10^8 pixels/side
-    at ts=256) and 2^21 labels per tile (> ts² for ts ≤ 1448).  Packed
-    ordering == lexicographic (tx, ty, label) ordering, so the min-id
-    component root is the lexicographic-min node on either side of the
-    connected-components size gate."""
-    return (
-        F.col(tx).cast("long") * (1 << (_TY_BITS + _LAB_BITS))
-        + F.col(ty).cast("long") * (1 << _LAB_BITS)
-        + F.col(lab).cast("long")
+def _pack(tx: int, ty: int, lab: int) -> int:
+    """The region key: (tx<<42)|(ty<<21)|local_label.  Tiles lie in
+    [0, 2^21) per axis and labels in [0, 2^21) (``_check_tile_size``),
+    so the key fits a signed long and packed order == lexicographic
+    (tx, ty, label) order: the smallest-key tie-breaks of the label
+    roots and of sieve absorption keep their meaning."""
+    if not (0 <= tx < 1 << _TY_BITS and 0 <= ty < 1 << _TY_BITS):
+        raise ValueError(
+            f"tile ({tx}, {ty}) is outside [0, 2^{_TY_BITS}) per axis: "
+            "the packed region key has no room for it"
+        )
+    return (tx << (_TY_BITS + _LAB_BITS)) | (ty << _LAB_BITS) | lab
+
+
+def _check_tile_size(tile_size: int) -> None:
+    """A tile of ts² pixels can hold ts² local labels, which must fit
+    the key's 21-bit label field (ts <= 1448)."""
+    if tile_size * tile_size > 1 << _LAB_BITS:
+        raise ValueError(
+            f"tile_size {tile_size}: {tile_size}² local labels overflow the "
+            f"{_LAB_BITS}-bit label field of the region key (tile_size <= 1448)"
+        )
+
+
+def _region_id(key: str):
+    """'tx_ty_label' of a packed key column."""
+    return F.concat_ws(
+        "_",
+        F.shiftright(key, _TY_BITS + _LAB_BITS),
+        F.shiftright(key, _LAB_BITS).bitwiseAND(F.lit(_TY_MASK)),
+        F.col(key).bitwiseAND(F.lit(_LAB_MASK)),
     )
 
 
-def _label_roots(edges: DataFrame) -> DataFrame | None:
-    """(tx, ty, local_label) → (root_tx, root_ty, root_label) for the
-    cross-tile label-merge graph: pack the node ids (``_enc``), run the
-    size-gated ``connected_components``, unpack the roots.  Returns
-    None when the graph has no edges."""
-    comp = connected_components(edges.select(
-        _enc("tx", "ty", "local_label").alias("src"),
-        _enc("rtx", "rty", "rlabel").alias("dst"),
-    ))
-    if comp.isEmpty():
-        return None
-    return comp.select(
-        F.shiftright("node", _TY_BITS + _LAB_BITS).alias("tx"),
-        F.shiftright("node", _LAB_BITS).bitwiseAND(F.lit(_TY_MASK)).alias("ty"),
-        F.col("node").bitwiseAND(F.lit(_LAB_MASK)).cast("int").alias("local_label"),
-        F.shiftright("component", _TY_BITS + _LAB_BITS).alias("root_tx"),
-        F.shiftright("component", _LAB_BITS).bitwiseAND(F.lit(_TY_MASK)).alias("root_ty"),
-        F.col("component").bitwiseAND(F.lit(_LAB_MASK)).cast("int").alias("root_label"),
+def _label(row, nodata, connect8: bool, tile_size: int):
+    """Decode one tile row → (pixel array, local labels)."""
+    arr = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(
+        tile_size, tile_size
     )
+    mask = None if nodata is None else arr != nodata
+    return arr, label_tile(arr, mask=mask, connect8=connect8)
 
 
-def _merge_edges(borders: DataFrame, connect8: bool, tile_size: int) -> DataFrame:
-    """Cross-tile label-merge edges from facing border runs.
+_TILE_FIELDS = [
+    T.StructField("kind", T.StringType()),
+    T.StructField("tx", T.LongType()),
+    T.StructField("ty", T.LongType()),
+    T.StructField("key", T.LongType()),
+    T.StructField("dn", T.DoubleType()),
+    T.StructField("pixel_count", T.LongType()),
+    T.StructField("side", T.StringType()),
+    T.StructField("start", T.IntegerType()),
+    T.StructField("end", T.IntegerType()),
+]
 
-    4-connectivity: facing E|W (S|N) runs with equal dn and overlapping
-    [start, end) merge.  8-connectivity (the reference's
-    connectedness==8 path, gdalrasterpolygonenumerator.cpp:75-167) adds
-    two cases:
+
+def _tile_pass(
+    tiles: DataFrame, nodata, connect8: bool, tile_size: int, extra=None
+) -> DataFrame:
+    """The one per-tile labelling pass: an "R" row per local region
+    (key, dn, pixel_count) and a "B" row per border run (tx, ty, key,
+    dn, side, start, end).  ``extra = (field, rows)`` adds an
+    operator's own rows in one more column: ``rows(labels, regions, tx,
+    ty)`` yields (kind, key, dn, value).  The tile size is checked
+    before any job runs; a tile outside the key's range fails its
+    task."""
+    _check_tile_size(tile_size)
+    fields = _TILE_FIELDS + ([extra[0]] if extra else [])
+    pad = (None,) * (len(fields) - len(_TILE_FIELDS))
+
+    def gen(pdf_iter):
+        for pdf in pdf_iter:
+            rows = []
+            for _, row in pdf.iterrows():
+                arr, labels = _label(row, nodata, connect8, tile_size)
+                tx, ty = int(row["tx"]), int(row["ty"])
+                key0 = _pack(tx, ty, 0)
+                regions = region_table(arr, labels)
+                for lab, dn, cnt, _, _ in regions:
+                    rows.append(("R", tx, ty, key0 | lab, float(dn), cnt, None, None, None) + pad)
+                for side, s, e, lab, dn in border_runs(arr, labels):
+                    rows.append(("B", tx, ty, key0 | lab, float(dn), None, side, s, e) + pad)
+                if extra:
+                    for kind, key, dn, value in extra[1](labels, regions, tx, ty):
+                        rows.append((kind, tx, ty, key, float(dn), None, None, None, None, value))
+            # object columns keep keys exact: pandas would turn an int
+            # column holding None into float64, which drops bits past 2^53
+            yield pd.DataFrame(rows, columns=[f.name for f in fields], dtype=object)
+
+    return tiles.mapInPandas(gen, T.StructType(fields))
+
+
+def _facing_runs(borders: DataFrame, connect8: bool, tile_size: int) -> DataFrame:
+    """(key, dn, rkey, rdn) for every pair of border runs in contact
+    across a tile edge: my E edge faces the (tx+1) tile's W edge, my S
+    edge the (ty+1) tile's N edge.  Equal dn ⇒ same region (a merge
+    edge); sieve keeps dn != rdn as region adjacency.  The candidate
+    set is border runs only, a ~1/tile_size fraction of the data.
+
+    4-connectivity: facing runs whose [start, end) overlap.
+    8-connectivity (the reference's connectedness==8 path,
+    gdalrasterpolygonenumerator.cpp:75-167) adds two cases:
       (a) diagonal adjacency across a shared edge — facing runs need
           only touch within ±1 (pixel (r, last) is 8-adjacent to
           (r±1, 0) of the next tile), so the interval test relaxes to
@@ -98,94 +163,52 @@ def _merge_edges(borders: DataFrame, connect8: bool, tile_size: int) -> DataFram
           tile pair are covered because the join is always written from
           the northern tile's S side.
     """
-    right = (
-        borders.withColumnRenamed("tx", "rtx")
-        .withColumnRenamed("ty", "rty")
-        .withColumnRenamed("local_label", "rlabel")
-        .withColumnRenamed("side", "rside")
-        .withColumnRenamed("start", "rstart")
-        .withColumnRenamed("end", "rend")
-        .withColumnRenamed("dn", "rdn")
-    )
+    borders = borders.select("tx", "ty", "key", "dn", "side", "start", "end")
+    right = borders.select(*(F.col(c).alias("r" + c) for c in borders.columns))
     if connect8:
         ov = (F.col("rstart") <= F.col("end")) & (F.col("rend") >= F.col("start"))
     else:
         ov = (F.col("rstart") < F.col("end")) & (F.col("rend") > F.col("start"))
-    east = borders.filter(F.col("side") == "E").join(
-        right.filter(F.col("rside") == "W"),
-        (F.col("rtx") == F.col("tx") + 1)
-        & (F.col("rty") == F.col("ty"))
-        & (F.col("rdn") == F.col("dn"))
-        & ov,
-    )
-    south = borders.filter(F.col("side") == "S").join(
-        right.filter(F.col("rside") == "N"),
-        (F.col("rtx") == F.col("tx"))
-        & (F.col("rty") == F.col("ty") + 1)
-        & (F.col("rdn") == F.col("dn"))
-        & ov,
-    )
-    parts = [east, south]
+
+    def facing(dx, dy, on, side="S", rside="N"):
+        return borders.filter(F.col("side") == side).join(
+            right.filter(F.col("rside") == rside),
+            (F.col("rtx") == F.col("tx") + dx) & (F.col("rty") == F.col("ty") + dy) & on,
+        )
+
+    out = facing(1, 0, ov, "E", "W").unionByName(facing(0, 1, ov))
     if connect8:
-        se = borders.filter(
-            (F.col("side") == "S") & (F.col("end") == tile_size)
-        ).join(
-            right.filter((F.col("rside") == "N") & (F.col("rstart") == 0)),
-            (F.col("rtx") == F.col("tx") + 1)
-            & (F.col("rty") == F.col("ty") + 1)
-            & (F.col("rdn") == F.col("dn")),
-        )
-        sw = borders.filter(
-            (F.col("side") == "S") & (F.col("start") == 0)
-        ).join(
-            right.filter((F.col("rside") == "N") & (F.col("rend") == tile_size)),
-            (F.col("rtx") == F.col("tx") - 1)
-            & (F.col("rty") == F.col("ty") + 1)
-            & (F.col("rdn") == F.col("dn")),
-        )
-        parts += [se, sw]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("tx", "ty", "local_label", "rtx", "rty", "rlabel")
+        se = (F.col("end") == tile_size) & (F.col("rstart") == 0)
+        sw = (F.col("start") == 0) & (F.col("rend") == tile_size)
+        out = out.unionByName(facing(1, 1, se)).unionByName(facing(-1, 1, sw))
+    return out.select("key", "dn", "rkey", "rdn")
 
 
-def _tile_ccl(tiles: DataFrame, nodata: float | None, connect8: bool, tile_size: int):
-    def per_tile(pdf_iter):
-        for pdf in pdf_iter:
-            for _, row in pdf.iterrows():
-                arr = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(
-                    tile_size, tile_size
-                )
-                mask = None if nodata is None else arr != nodata
-                labels = label_tile(arr, mask=mask, connect8=connect8)
-                regions = region_table(arr, labels)
-                for lab, dn, cnt, _, _ in regions:
-                    yield ("R", row["tx"], row["ty"], lab, float(dn), cnt, None, None, None)
-                for side, s, e, lab, dn in border_runs(arr, labels):
-                    yield ("B", row["tx"], row["ty"], lab, float(dn), None, side, s, e)
-
-    def gen(pdf_iter):
-        rows = list(per_tile(pdf_iter))
-        yield pd.DataFrame(
-            rows,
-            columns=["kind", "tx", "ty", "local_label", "dn", "pixel_count", "side", "start", "end"],
-        )
-
-    mixed_schema = T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("tx", T.LongType()),
-            T.StructField("ty", T.LongType()),
-            T.StructField("local_label", T.IntegerType()),
-            T.StructField("dn", T.DoubleType()),
-            T.StructField("pixel_count", T.LongType()),
-            T.StructField("side", T.StringType()),
-            T.StructField("start", T.IntegerType()),
-            T.StructField("end", T.IntegerType()),
-        ]
+def _label_roots(merges: DataFrame) -> DataFrame:
+    """(key, root) for every key on a merge edge, root = the smallest
+    key of its component, through the size-gated
+    ``connected_components``.  An empty graph yields an empty local
+    relation, which ``_rooted``'s join folds away."""
+    return connected_components(merges.select("key", "rkey"), "key", "rkey").select(
+        F.col("node").alias("key"), F.col("component").alias("root")
     )
-    return tiles.mapInPandas(gen, mixed_schema)
+
+
+def _rooted(df: DataFrame, roots: DataFrame, key: str = "key", out: str = "root") -> DataFrame:
+    """``df`` with column ``out`` = the root of its ``key`` column in
+    the (key, root) map ``roots``, or the key itself where unmapped."""
+    m = roots.select(F.col("key").alias("_node"), F.col("root").alias("_root"))
+    return (
+        df.join(m, F.col(key) == F.col("_node"), "left")
+        .withColumn(out, F.coalesce("_root", key))
+        .drop("_node", "_root")
+    )
+
+
+def _merged(mixed: DataFrame, connect8: bool, tile_size: int) -> DataFrame:
+    """The root map of a ``_tile_pass`` output's same-dn contacts."""
+    facing = _facing_runs(mixed.filter(F.col("kind") == "B"), connect8, tile_size)
+    return _label_roots(facing.filter(F.col("dn") == F.col("rdn")))
 
 
 def polygonize_tiles(
@@ -196,51 +219,15 @@ def polygonize_tiles(
 ) -> DataFrame:
     """Tile table → global region table (region_id, dn, pixel_count,
     n_tiles) with exact cross-tile merging."""
-    mixed = _tile_ccl(tiles, nodata, connect8, tile_size).persist()
-    regions = mixed.filter(F.col("kind") == "R").drop("kind", "side", "start", "end")
-    borders = (
-        mixed.filter(F.col("kind") == "B")
-        .drop("kind", "pixel_count")
+    # `mixed` stays persisted: the label-graph gate materializes it,
+    # and the returned (lazy) region table reuses it.
+    mixed = _tile_pass(tiles, nodata, connect8, tile_size).persist()
+    regions = _rooted(mixed.filter(F.col("kind") == "R"), _merged(mixed, connect8, tile_size))
+    return (
+        regions.groupBy("root", "dn")
+        .agg(F.sum("pixel_count").alias("pixel_count"), F.count("*").alias("n_tiles"))
+        .select(_region_id("root").alias("region_id"), "dn", "pixel_count", "n_tiles")
     )
-
-    # Facing-run join: my E edge joins the (tx+1) tile's W edge, my S
-    # joins (ty+1)'s N; equal dn + overlapping [start, end) ⇒ merge.
-    # (Range-overlap equi-join on the shared edge; the candidate set is
-    # border runs only, a ~1/tile_size fraction of the data.)  With
-    # connect8 the overlap relaxes by ±1 and diagonal tile-corner
-    # adjacency is added — see ``_merge_edges``.
-    edges = _merge_edges(borders, connect8, tile_size)
-
-    # Label-graph roots through the size-gated connected components.
-    map_df = _label_roots(edges)
-
-    keyed = regions
-    if map_df is not None:
-        keyed = regions.join(map_df, ["tx", "ty", "local_label"], "left")
-    else:
-        keyed = regions.withColumn("root_tx", F.lit(None).cast("long")).withColumn(
-            "root_ty", F.lit(None).cast("long")
-        ).withColumn("root_label", F.lit(None).cast("int"))
-    keyed = (
-        keyed.withColumn("root_tx", F.coalesce("root_tx", "tx"))
-        .withColumn("root_ty", F.coalesce("root_ty", "ty"))
-        .withColumn("root_label", F.coalesce("root_label", "local_label"))
-    )
-    out = (
-        keyed.groupBy("root_tx", "root_ty", "root_label", "dn")
-        .agg(
-            F.sum("pixel_count").alias("pixel_count"),
-            F.count("*").alias("n_tiles"),
-        )
-        .withColumn(
-            "region_id",
-            F.concat_ws("_", "root_tx", "root_ty", "root_label").alias("region_id"),
-        )
-        .select("region_id", "dn", "pixel_count", "n_tiles")
-    )
-    # `mixed` stays persisted: the border-edge collect already
-    # materialized it, and the returned (lazy) region table reuses it.
-    return out
 
 
 def polygonize_dissolved(
@@ -254,10 +241,10 @@ def polygonize_dissolved(
     GDALPolygonize output (one polygon with holes per global region,
     alg/polygonize.cpp pass 2) assembled distributedly:
 
-    1. per tile: CCL + border runs (as in ``polygonize_tiles``) PLUS
-       each local label's directed boundary unit-edges in global pixel
-       coords (O(perimeter) ints, packed as one binary per label);
-    2. border-run equi-join → union-find → (tile, label) → root region
+    1. per tile: the ``_tile_pass`` rows PLUS each local label's
+       directed boundary unit-edges in global pixel coords
+       (O(perimeter) ints, packed as one binary per label);
+    2. facing-run join → connected components → key → root region
        (the same small label graph as the region table);
     3. edges shuffle ONCE keyed by root region; per region, interior
        tile-border segments cancel in opposite-direction pairs (tile A
@@ -271,69 +258,28 @@ def polygonize_dissolved(
     from gdal_spark.kernels.ccl import _boundary_edges, _chain_rings, _ring_area
     from gdal_spark.kernels.geodesy import pixel_to_world
 
-    mixed_schema = T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("tx", T.LongType()),
-            T.StructField("ty", T.LongType()),
-            T.StructField("local_label", T.IntegerType()),
-            T.StructField("dn", T.DoubleType()),
-            T.StructField("side", T.StringType()),
-            T.StructField("start", T.IntegerType()),
-            T.StructField("end", T.IntegerType()),
-            T.StructField("edges", T.BinaryType()),
-        ]
-    )
-
-    def per_tile(pdf_iter):
-        for pdf in pdf_iter:
-            rows = []
-            for _, row in pdf.iterrows():
-                arr = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(
-                    tile_size, tile_size
-                )
-                tx, ty = int(row["tx"]), int(row["ty"])
-                ox, oy = tx * tile_size, ty * tile_size
-                mask = None if nodata is None else arr != nodata
-                labels = label_tile(arr, mask=mask, connect8=connect8)
-                for lab, dn, _cnt, _, _ in region_table(arr, labels):
-                    e = np.array(
-                        [(a[0] + ox, a[1] + oy, b[0] + ox, b[1] + oy)
-                         for a, b in _boundary_edges(labels, lab)],
-                        dtype=np.int32,
-                    )
-                    rows.append(("E", tx, ty, lab, float(dn), None, None, None, e.tobytes()))
-                for side, s, epos, lab, dn in border_runs(arr, labels):
-                    rows.append(("B", tx, ty, lab, float(dn), side, s, epos, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["kind", "tx", "ty", "local_label", "dn", "side", "start", "end", "edges"],
+    def boundary_edges(labels, regions, tx, ty):
+        ox, oy = tx * tile_size, ty * tile_size
+        for lab, dn, _cnt, _, _ in regions:
+            e = np.array(
+                [(a[0] + ox, a[1] + oy, b[0] + ox, b[1] + oy)
+                 for a, b in _boundary_edges(labels, lab)],
+                dtype=np.int32,
             )
+            yield "E", _pack(tx, ty, lab), dn, e.tobytes()
 
-    mixed = tiles.mapInPandas(per_tile, mixed_schema).persist()
-    borders = mixed.filter(F.col("kind") == "B").drop("kind", "edges")
-    edges_lr = _merge_edges(borders, connect8, tile_size)
-    map_df = _label_roots(edges_lr)
-    e_rows = mixed.filter(F.col("kind") == "E").select(
-        "tx", "ty", "local_label", "dn", "edges"
-    )
-    if map_df is not None:
-        e_rows = e_rows.join(map_df, ["tx", "ty", "local_label"], "left")
-    else:
-        e_rows = (
-            e_rows.withColumn("root_tx", F.lit(None).cast("long"))
-            .withColumn("root_ty", F.lit(None).cast("long"))
-            .withColumn("root_label", F.lit(None).cast("int"))
-        )
-    e_rows = (
-        e_rows.withColumn("root_tx", F.coalesce("root_tx", "tx"))
-        .withColumn("root_ty", F.coalesce("root_ty", "ty"))
-        .withColumn("root_label", F.coalesce("root_label", "local_label"))
+    mixed = _tile_pass(
+        tiles, nodata, connect8, tile_size,
+        extra=(T.StructField("edges", T.BinaryType()), boundary_edges),
+    ).persist()
+    e_rows = _rooted(
+        mixed.filter(F.col("kind") == "E").select("key", "dn", "edges"),
+        _merged(mixed, connect8, tile_size),
     )
 
     out_schema = T.StructType(
         [
-            T.StructField("region_id", T.StringType()),
+            T.StructField("root", T.LongType()),
             T.StructField("dn", T.DoubleType()),
             T.StructField("n_rings", T.IntegerType()),
             T.StructField("perim", T.DoubleType()),
@@ -343,7 +289,6 @@ def polygonize_dissolved(
     )
 
     def dissolve(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        rtx, rty, rlabel, dn = int(key[0]), int(key[1]), int(key[2]), float(key[3])
         counts: dict = {}
         for blob in pdf["edges"]:
             e = np.frombuffer(blob, dtype=np.int32).reshape(-1, 4)
@@ -378,8 +323,8 @@ def polygonize_dissolved(
         blob = Wk.polygon_wkb(world) if world else None
         return pd.DataFrame(
             {
-                "region_id": [f"{rtx}_{rty}_{rlabel}"],
-                "dn": [dn],
+                "root": [int(key[0])],
+                "dn": [float(key[1])],
                 "n_rings": [len(ordered)],
                 "perim": [round(perim, 9)],
                 "parea": [float(parea)],
@@ -388,8 +333,9 @@ def polygonize_dissolved(
         )
 
     return (
-        e_rows.groupBy("root_tx", "root_ty", "root_label", "dn")
+        e_rows.groupBy("root", "dn")
         .applyInPandas(dissolve, out_schema)
+        .select(_region_id("root").alias("region_id"), "dn", "n_rings", "perim", "parea", "wkb")
     )
 
 
@@ -431,9 +377,7 @@ def polygonize_geometry(
         for pdf in pdf_iter:
             rows = []
             for _, row in pdf.iterrows():
-                arr = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(
-                    tile_size, tile_size
-                )
+                arr, labels = _label(row, nodata, connect8, tile_size)
                 tx, ty = int(row["tx"]), int(row["ty"])
                 # tile-local geotransform: offset the origin by the
                 # tile position so rings come out in global coords
@@ -443,8 +387,6 @@ def polygonize_geometry(
                     gt[3] + tx * tile_size * gt[4] + ty * tile_size * gt[5],
                     gt[4], gt[5],
                 )
-                mask = None if nodata is None else arr != nodata
-                labels = label_tile(arr, mask=mask, connect8=connect8)
                 counts = {
                     lab: cnt for lab, _dn, cnt, _, _ in region_table(arr, labels)
                 }

@@ -7,31 +7,34 @@ polygons with the same two-pass CCL as polygonize, then repeatedly
 merges every small polygon into its largest neighbour until no
 under-threshold polygon remains, and writes the merged values back.
 
-Distributed decomposition (same skeleton as ``operators.polygonize``):
+Distributed decomposition (on ``operators.polygonize``'s labelling
+machinery; every region is one packed key, ``polygonize._pack``):
 
-  1. per tile: CCL + region summaries + border runs + IN-TILE label
-     adjacency pairs (one vectorized shift-compare per axis);
-  2. cross-tile: facing border-run join — equal-dn overlaps are
-     same-region merge edges (exactly ``polygonize._merge_edges``),
-     different-dn overlaps are region ADJACENCY;
+  1. per tile: ``polygonize._tile_pass`` (CCL + region summaries +
+     border runs) plus IN-TILE label adjacency pairs (one vectorized
+     shift-compare per axis);
+  2. cross-tile: ``polygonize._facing_runs`` — equal-dn contacts are
+     same-region merge edges, different-dn contacts are region
+     ADJACENCY;
   3. same-region roots via ``polygonize._label_roots`` (the
-     size-gated ``graph.connected_components``); region sizes and the
-     contracted region-level adjacency are DataFrame aggregations
-     (groupBy root / distinct root-pair join), never collected in full;
+     size-gated ``graph.connected_components``) and ``_rooted``; region
+     sizes and the contracted region-level adjacency are DataFrame
+     aggregations (groupBy root / distinct root pairs), never
+     collected in full;
   4. absorption over ONLY the under-threshold subgraph — adjacency
      edges incident to a small region plus their endpoints' stats —
-     small region → largest current neighbour, by (count, id),
-     deterministic.  Sufficient because absorption only ever grows
-     regions: a region ≥ threshold at the start can never be absorbed,
-     so the loop's reachable state is exactly the small-incident
-     subgraph.  The subgraph goes through the same size gate as the
-     graph operators (``graph.driver_rows``): collected to the driver
-     loop when it fits, the same rounds as distributed DataFrame
-     contractions past it;
-  5. apply: broadcast the (tile, local_label) → merged dn map
-     (CHANGED regions only) and relabel each tile independently (a
-     second CCL pass per tile instead of shuffling label arrays);
-     unchanged labels keep their own dn from the tile itself.
+     small region → largest current neighbour, by (count, smallest
+     key), deterministic.  Sufficient because absorption only ever
+     grows regions: a region ≥ threshold at the start can never be
+     absorbed, so the loop's reachable state is exactly the
+     small-incident subgraph.  The subgraph goes through the same size
+     gate as the graph operators (``graph.driver_rows``): collected to
+     the driver loop when it fits, the same rounds as distributed
+     DataFrame contractions past it;
+  5. apply: join the key → merged dn map (CHANGED regions only) onto
+     the tiles and relabel each tile independently (a second CCL pass
+     per tile instead of shuffling label arrays); unchanged labels keep
+     their own dn from the tile itself.
 
 Like the reference, masked (nodata) pixels take part in nothing: small
 regions bordered only by nodata stay.
@@ -47,9 +50,11 @@ from pyspark.sql import types as T
 
 from gdal_spark.session import local_df
 
-from gdal_spark.kernels.ccl import border_runs, label_tile, region_table
+from gdal_spark.kernels.ccl import region_table
 from gdal_spark.operators import graph
-from gdal_spark.operators.polygonize import _label_roots
+from gdal_spark.operators.polygonize import (
+    _LAB_MASK, _facing_runs, _label, _label_roots, _pack, _rooted, _tile_pass,
+)
 
 
 def _absorb_rounds(count: dict, dn_of: dict, adj: dict, threshold: int) -> dict:
@@ -69,7 +74,7 @@ def _absorb_rounds(count: dict, dn_of: dict, adj: dict, threshold: int) -> dict:
     Returns {absorbed key: terminal key} for CHANGED regions only.
     """
     def W_(r):
-        return (count[r], tuple(-v for v in r))
+        return (count[r], -r)
 
     parent: dict = {}
     cur_adj = {k: set(v) for k, v in adj.items()}
@@ -106,28 +111,12 @@ def _absorb_rounds(count: dict, dn_of: dict, adj: dict, threshold: int) -> dict:
                 rn = rep(n)
                 if rn != ra:
                     s.add(rn)
-        for s in new_adj.values():
-            s.discard(None)
         cur_adj = new_adj
         for k in list(parent):
             parent[k] = rep(parent[k])
         parent.update(moves)
     return parent
 
-_MIX_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.StringType()),
-        T.StructField("tx", T.LongType()),
-        T.StructField("ty", T.LongType()),
-        T.StructField("local_label", T.IntegerType()),
-        T.StructField("dn", T.DoubleType()),
-        T.StructField("pixel_count", T.LongType()),
-        T.StructField("side", T.StringType()),
-        T.StructField("start", T.IntegerType()),
-        T.StructField("end", T.IntegerType()),
-        T.StructField("lab_b", T.IntegerType()),
-    ]
-)
 
 TILE_OUT_SCHEMA = T.StructType(
     [
@@ -152,69 +141,33 @@ def _absorb_rounds_distributed(
     pointer (self-join), chains collapse by pointer doubling, counts
     re-aggregate, edges contract.  Rounds are O(log absorption-chain
     length); each round is a handful of shuffles over the small
-    subgraph only.
+    subgraph only.  Pointers and the cumulative absorption map are
+    (key, root) maps, applied with ``_rooted``.
 
-    Returns (root_tx, root_ty, root_label, new_dn) for CHANGED regions.
+    Returns (root, new_dn) for CHANGED regions.
     """
-    K = ["kx", "ky", "kl"]
-
-    stats = root_stats.select(
-        F.col("root_tx").alias("kx"),
-        F.col("root_ty").alias("ky"),
-        F.col("root_label").cast("long").alias("kl"),
-        F.col("total"),
-        F.col("dn"),
-    ).localCheckpoint()
-    half = incident_edges.select(
-        F.col("root_tx").alias("ax"), F.col("root_ty").alias("ay"),
-        F.col("root_label").cast("long").alias("al"),
-        F.col("broot_tx").alias("bx"), F.col("broot_ty").alias("by"),
-        F.col("broot_label").cast("long").alias("bl"),
-    )
+    stats = root_stats.select(F.col("root").alias("key"), "total", "dn").localCheckpoint()
+    half = incident_edges.select(F.col("root").alias("a"), F.col("broot").alias("b"))
     edges = half.unionByName(
-        half.select(
-            F.col("bx").alias("ax"), F.col("by").alias("ay"),
-            F.col("bl").alias("al"),
-            F.col("ax").alias("bx"), F.col("ay").alias("by"),
-            F.col("al").alias("bl"),
-        )
+        half.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().localCheckpoint()
 
-    pmap = None  # (ox, oy, ol) -> (kx, ky, kl) cumulative
+    def totals(col):
+        return stats.select(F.col("key").alias(col), F.col("total").alias(col + "_total"))
+
+    pmap = None  # absorbed key → current terminal, cumulative
     absorbed_all = False
     for _round in range(64):
-        small = stats.filter(F.col("total") < threshold).select(*K)
-        # pointers: for each small a, neighbour maximizing
-        # (total, -key) — struct max is lexicographic, so negated key
-        # fields implement the smallest-key tie-break
-        nb = edges.join(
-            small,
-            (edges["ax"] == small["kx"]) & (edges["ay"] == small["ky"])
-            & (edges["al"] == small["kl"]),
-            "leftsemi",
-        )
-        bstats = stats.select(
-            F.col("kx").alias("bx"), F.col("ky").alias("by"),
-            F.col("kl").alias("bl"), F.col("total").alias("btotal"),
-        )
-        nbs = nb.join(bstats, ["bx", "by", "bl"])
+        small = stats.filter(F.col("total") < threshold).select(F.col("key").alias("a"))
+        # pointers: each small a picks the neighbour maximizing
+        # (total, -key) — struct max is lexicographic, so the negated
+        # key implements the smallest-key tie-break
         ptr = (
-            nbs.groupBy("ax", "ay", "al")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("btotal"),
-                        (-F.col("bx")).alias("nx"),
-                        (-F.col("by")).alias("ny"),
-                        (-F.col("bl")).alias("nl"),
-                    )
-                ).alias("m")
-            )
-            .select(
-                "ax", "ay", "al",
-                (-F.col("m.nx")).alias("tx_"), (-F.col("m.ny")).alias("ty_"),
-                (-F.col("m.nl")).alias("tl_"),
-            )
+            edges.join(small, "a", "leftsemi")
+            .join(totals("b"), "b")
+            .groupBy("a")
+            .agg(F.max(F.struct("b_total", (-F.col("b")).alias("nb"))).alias("m"))
+            .select(F.col("a").alias("key"), (-F.col("m.nb")).alias("root"))
             .localCheckpoint()
         )
         if ptr.rdd.isEmpty():
@@ -223,78 +176,26 @@ def _absorb_rounds_distributed(
         # 2-cycles: a→t and t→a — drop the WINNER's pointer, where the
         # winner is the larger (total, smallest-key); the loop weight
         # is a total order so longer cycles cannot occur
-        rev = ptr.select(
-            F.col("ax").alias("r_ax"), F.col("ay").alias("r_ay"),
-            F.col("al").alias("r_al"),
-            F.col("tx_").alias("r_tx"), F.col("ty_").alias("r_ty"),
-            F.col("tl_").alias("r_tl"),
-        )
-        astats = stats.select(
-            F.col("kx").alias("ax"), F.col("ky").alias("ay"),
-            F.col("kl").alias("al"), F.col("total").alias("a_total"),
-        )
-        tstats = stats.select(
-            F.col("kx").alias("tx_"), F.col("ky").alias("ty_"),
-            F.col("kl").alias("tl_"), F.col("total").alias("t_total"),
-        )
+        rev = ptr.select(F.col("root").alias("key"), F.col("key").alias("root"))
         cyc = (
-            ptr.join(
-                rev,
-                (F.col("tx_") == F.col("r_ax")) & (F.col("ty_") == F.col("r_ay"))
-                & (F.col("tl_") == F.col("r_al"))
-                & (F.col("ax") == F.col("r_tx")) & (F.col("ay") == F.col("r_ty"))
-                & (F.col("al") == F.col("r_tl")),
-            )
-            .join(astats, ["ax", "ay", "al"])
-            .join(tstats, ["tx_", "ty_", "tl_"])
+            ptr.join(rev, ["key", "root"])
+            .join(totals("key"), "key")
+            .join(totals("root"), "root")
         )
-        a_wins = (
-            (F.col("a_total") > F.col("t_total"))
-            | (
-                (F.col("a_total") == F.col("t_total"))
-                & (
-                    F.struct(
-                        (-F.col("ax")).alias("x"), (-F.col("ay")).alias("y"),
-                        (-F.col("al")).alias("l"),
-                    )
-                    > F.struct(
-                        (-F.col("tx_")).alias("x"), (-F.col("ty_")).alias("y"),
-                        (-F.col("tl_")).alias("l"),
-                    )
-                )
-            )
+        a_wins = (F.col("key_total") > F.col("root_total")) | (
+            (F.col("key_total") == F.col("root_total")) & (F.col("key") < F.col("root"))
         )
-        winners = cyc.filter(a_wins).select("ax", "ay", "al")
-        ptr = ptr.join(winners, ["ax", "ay", "al"], "left_anti").localCheckpoint()
+        winners = cyc.filter(a_wins).select("key")
+        ptr = ptr.join(winners, "key", "left_anti").localCheckpoint()
 
         # pointer doubling to terminals (chains are loop-free now);
         # 32 doublings cover chains of length 2^32 — loud if exceeded
-        jumped_all = False
         for _ in range(32):
-            nxt = ptr.select(
-                F.col("ax").alias("n_ax"), F.col("ay").alias("n_ay"),
-                F.col("al").alias("n_al"),
-                F.col("tx_").alias("n_tx"), F.col("ty_").alias("n_ty"),
-                F.col("tl_").alias("n_tl"),
-            )
-            j = ptr.join(
-                nxt,
-                (F.col("tx_") == F.col("n_ax")) & (F.col("ty_") == F.col("n_ay"))
-                & (F.col("tl_") == F.col("n_al")),
-                "left",
-            )
-            hops = j.filter(F.col("n_tx").isNotNull())
-            if hops.rdd.isEmpty():
-                ptr = j.select("ax", "ay", "al", "tx_", "ty_", "tl_")
-                jumped_all = True
+            hop = _rooted(ptr.withColumnRenamed("root", "via"), ptr, "via", "root")
+            if hop.filter(F.col("via") != F.col("root")).rdd.isEmpty():
                 break
-            ptr = j.select(
-                "ax", "ay", "al",
-                F.coalesce("n_tx", "tx_").alias("tx_"),
-                F.coalesce("n_ty", "ty_").alias("ty_"),
-                F.coalesce("n_tl", "tl_").alias("tl_"),
-            ).localCheckpoint()
-        if not jumped_all:
+            ptr = hop.drop("via").localCheckpoint()
+        else:
             raise RuntimeError(
                 "sieve pointer-doubling did not reach terminals in 32 "
                 "iterations (chain length > 2^32?)"
@@ -302,96 +203,30 @@ def _absorb_rounds_distributed(
 
         # apply the moves: counts re-aggregate onto terminals
         adds = (
-            ptr.join(
-                stats,
-                (F.col("ax") == F.col("kx")) & (F.col("ay") == F.col("ky"))
-                & (F.col("al") == F.col("kl")),
-            )
-            .groupBy("tx_", "ty_", "tl_")
+            ptr.join(stats, "key")
+            .groupBy(F.col("root").alias("key"))
             .agg(F.sum("total").alias("added"))
         )
-        moved_keys = ptr.select(
-            F.col("ax").alias("kx"), F.col("ay").alias("ky"),
-            F.col("al").alias("kl"),
-        )
         stats = (
-            stats.join(moved_keys, K, "left_anti")
-            .join(
-                adds,
-                (F.col("kx") == F.col("tx_")) & (F.col("ky") == F.col("ty_"))
-                & (F.col("kl") == F.col("tl_")),
-                "left",
-            )
+            stats.join(ptr.select("key"), "key", "left_anti")
+            .join(adds, "key", "left")
             .select(
-                "kx", "ky", "kl",
-                (F.col("total") + F.coalesce("added", F.lit(0))).alias("total"),
-                "dn",
+                "key", (F.col("total") + F.coalesce("added", F.lit(0))).alias("total"), "dn"
             )
             .localCheckpoint()
         )
         # contract edges through the moves, drop self-loops
-        amap = ptr.select(
-            F.col("ax").alias("m_x"), F.col("ay").alias("m_y"),
-            F.col("al").alias("m_l"),
-            F.col("tx_").alias("m_tx"), F.col("ty_").alias("m_ty"),
-            F.col("tl_").alias("m_tl"),
+        edges = (
+            _rooted(_rooted(edges, ptr, "a", "a"), ptr, "b", "b")
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+            .localCheckpoint()
         )
-        e2 = (
-            edges.join(
-                amap,
-                (F.col("ax") == F.col("m_x")) & (F.col("ay") == F.col("m_y"))
-                & (F.col("al") == F.col("m_l")),
-                "left",
-            )
-            .select(
-                F.coalesce("m_tx", "ax").alias("ax"),
-                F.coalesce("m_ty", "ay").alias("ay"),
-                F.coalesce("m_tl", "al").alias("al"),
-                "bx", "by", "bl",
-            )
-            .join(
-                amap,
-                (F.col("bx") == F.col("m_x")) & (F.col("by") == F.col("m_y"))
-                & (F.col("bl") == F.col("m_l")),
-                "left",
-            )
-            .select(
-                "ax", "ay", "al",
-                F.coalesce("m_tx", "bx").alias("bx"),
-                F.coalesce("m_ty", "by").alias("by"),
-                F.coalesce("m_tl", "bl").alias("bl"),
-            )
-        )
-        edges = e2.filter(
-            (F.col("ax") != F.col("bx")) | (F.col("ay") != F.col("by"))
-            | (F.col("al") != F.col("bl"))
-        ).distinct().localCheckpoint()
-
         # fold into the cumulative absorption map
-        moves = ptr.select(
-            F.col("ax").alias("ox"), F.col("ay").alias("oy"),
-            F.col("al").alias("ol"),
-            F.col("tx_").alias("kx"), F.col("ty_").alias("ky"),
-            F.col("tl_").alias("kl"),
-        )
         if pmap is None:
-            pmap = moves.localCheckpoint()
+            pmap = ptr
         else:
-            remapped = (
-                pmap.join(
-                    amap,
-                    (F.col("kx") == F.col("m_x")) & (F.col("ky") == F.col("m_y"))
-                    & (F.col("kl") == F.col("m_l")),
-                    "left",
-                )
-                .select(
-                    "ox", "oy", "ol",
-                    F.coalesce("m_tx", "kx").alias("kx"),
-                    F.coalesce("m_ty", "ky").alias("ky"),
-                    F.coalesce("m_tl", "kl").alias("kl"),
-                )
-            )
-            pmap = remapped.unionByName(moves).localCheckpoint()
+            pmap = _rooted(pmap, ptr, "root", "root").unionByName(ptr).localCheckpoint()
     if not absorbed_all:
         # ADVICE round-3: truncation must be LOUD, never silent — the
         # gated driver loop iterates unbounded, so a capped distributed
@@ -404,152 +239,32 @@ def _absorb_rounds_distributed(
             "— under-threshold regions with neighbours remain"
         )
     if pmap is None:
-        spark = root_stats.sparkSession
-        return local_df(
-            spark, [],
-            "root_tx long, root_ty long, root_label int, new_dn double",
-        )
+        return local_df(root_stats.sparkSession, [], "root long, new_dn double")
     # new dn = terminal's dn
-    dnk = stats.select("kx", "ky", "kl", F.col("dn").alias("new_dn"))
-    return pmap.join(dnk, K).select(
-        F.col("ox").alias("root_tx"), F.col("oy").alias("root_ty"),
-        F.col("ol").cast("int").alias("root_label"), "new_dn",
-    )
+    terminal_dn = stats.select(F.col("key").alias("root"), F.col("dn").alias("new_dn"))
+    return pmap.join(terminal_dn, "root").select(F.col("key").alias("root"), "new_dn")
 
 
-def _tile_pass(tiles: DataFrame, nodata, connect8, tile_size):
-    ts = tile_size
+def _adjacency(connect8: bool):
+    """``_tile_pass`` extra rows: an "A" row (key, key_b) per pair of
+    different labels in contact inside a tile (diagonal shifts
+    included under 8-connectivity)."""
 
-    def gen(pdf_iter):
-        for pdf in pdf_iter:
-            rows = []
-            for _, row in pdf.iterrows():
-                arr = np.frombuffer(row["data"], dtype=np.dtype(row["dtype"])).reshape(ts, ts)
-                tx, ty = int(row["tx"]), int(row["ty"])
-                mask = None if nodata is None else arr != nodata
-                labels = label_tile(arr, mask=mask, connect8=connect8)
-                for lab, dn, cnt, _, _ in region_table(arr, labels):
-                    rows.append(("R", tx, ty, lab, float(dn), cnt, None, None, None, None))
-                for side, s, e, lab, dn in border_runs(arr, labels):
-                    rows.append(("B", tx, ty, lab, float(dn), None, side, s, e, None))
-                # in-tile adjacency: different labels, both valid
-                # (diagonal shifts included under 8-connectivity)
-                shifts = [
-                    (labels[:, :-1], labels[:, 1:]),
-                    (labels[:-1, :], labels[1:, :]),
-                ]
-                if connect8:
-                    shifts += [
-                        (labels[:-1, :-1], labels[1:, 1:]),
-                        (labels[:-1, 1:], labels[1:, :-1]),
-                    ]
-                for a, b in shifts:
-                    m = (a >= 0) & (b >= 0) & (a != b)
-                    if m.any():
-                        pairs = np.unique(
-                            np.stack([a[m], b[m]], axis=1), axis=0
-                        )
-                        for la, lb in pairs.tolist():
-                            rows.append(("A", tx, ty, int(la), 0.0, None, None, None, None, int(lb)))
-            yield pd.DataFrame(
-                rows,
-                columns=["kind", "tx", "ty", "local_label", "dn", "pixel_count",
-                         "side", "start", "end", "lab_b"],
-            )
+    def rows(labels, regions, tx, ty):
+        key0 = _pack(tx, ty, 0)
+        shifts = [(labels[:, :-1], labels[:, 1:]), (labels[:-1, :], labels[1:, :])]
+        if connect8:
+            shifts += [
+                (labels[:-1, :-1], labels[1:, 1:]),
+                (labels[:-1, 1:], labels[1:, :-1]),
+            ]
+        for a, b in shifts:
+            m = (a >= 0) & (b >= 0) & (a != b)
+            if m.any():
+                for la, lb in np.unique(np.stack([a[m], b[m]], axis=1), axis=0).tolist():
+                    yield "A", key0 | la, 0.0, key0 | lb
 
-    return tiles.mapInPandas(gen, _MIX_SCHEMA)
-
-
-def _cross_tile_pairs(borders: DataFrame, connect8: bool, tile_size: int):
-    """Facing-run join WITHOUT the dn-equality predicate: overlapping
-    region contacts across tile edges.  Under 8-connectivity the
-    interval test relaxes to ±1 touch and the diagonal tile-corner
-    contacts are added — same geometry as ``polygonize._merge_edges``
-    but keeping (dn, rdn) so callers can split same-region merges
-    (dn == rdn) from cross-region adjacency (dn != rdn)."""
-    right = (
-        borders.withColumnRenamed("tx", "rtx")
-        .withColumnRenamed("ty", "rty")
-        .withColumnRenamed("local_label", "rlabel")
-        .withColumnRenamed("side", "rside")
-        .withColumnRenamed("start", "rstart")
-        .withColumnRenamed("end", "rend")
-        .withColumnRenamed("dn", "rdn")
-    )
-    if connect8:
-        ov = (F.col("rstart") <= F.col("end")) & (F.col("rend") >= F.col("start"))
-    else:
-        ov = (F.col("rstart") < F.col("end")) & (F.col("rend") > F.col("start"))
-    east = borders.filter(F.col("side") == "E").join(
-        right.filter(F.col("rside") == "W"),
-        (F.col("rtx") == F.col("tx") + 1) & (F.col("rty") == F.col("ty")) & ov,
-    )
-    south = borders.filter(F.col("side") == "S").join(
-        right.filter(F.col("rside") == "N"),
-        (F.col("rtx") == F.col("tx")) & (F.col("rty") == F.col("ty") + 1) & ov,
-    )
-    parts = [east, south]
-    if connect8:
-        se = borders.filter(
-            (F.col("side") == "S") & (F.col("end") == tile_size)
-        ).join(
-            right.filter((F.col("rside") == "N") & (F.col("rstart") == 0)),
-            (F.col("rtx") == F.col("tx") + 1) & (F.col("rty") == F.col("ty") + 1),
-        )
-        sw = borders.filter(
-            (F.col("side") == "S") & (F.col("start") == 0)
-        ).join(
-            right.filter((F.col("rside") == "N") & (F.col("rend") == tile_size)),
-            (F.col("rtx") == F.col("tx") - 1) & (F.col("rty") == F.col("ty") + 1),
-        )
-        parts += [se, sw]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "tx", "ty", "local_label", "dn", "rtx", "rty", "rlabel", "rdn"
-    )
-
-
-def _contract(
-    df: DataFrame,
-    root_map: DataFrame | None,
-    src: tuple[str, str, str],
-    out: tuple[str, str, str],
-) -> DataFrame:
-    """Map the (tile, label) node columns ``src`` of ``df`` through the
-    root map into new columns ``out``, defaulting unmapped nodes to
-    themselves.  Column names are fully parameterised so both endpoints
-    of an edge table can be contracted in one plan."""
-    if root_map is None:
-        return (
-            df.withColumn(out[0], F.col(src[0]).cast("long"))
-            .withColumn(out[1], F.col(src[1]).cast("long"))
-            .withColumn(out[2], F.col(src[2]).cast("int"))
-        )
-    k0, k1, k2 = (s + "__k" for s in src)
-    m0, m1, m2 = (o + "__m" for o in out)
-    rm = root_map.select(
-        F.col("tx").alias(k0),
-        F.col("ty").alias(k1),
-        F.col("local_label").alias(k2),
-        F.col("root_tx").alias(m0),
-        F.col("root_ty").alias(m1),
-        F.col("root_label").alias(m2),
-    )
-    joined = df.join(
-        rm,
-        (F.col(src[0]) == F.col(k0))
-        & (F.col(src[1]) == F.col(k1))
-        & (F.col(src[2]) == F.col(k2)),
-        "left",
-    )
-    return (
-        joined.withColumn(out[0], F.coalesce(m0, F.col(src[0]).cast("long")))
-        .withColumn(out[1], F.coalesce(m1, F.col(src[1]).cast("long")))
-        .withColumn(out[2], F.coalesce(m2, F.col(src[2]).cast("int")))
-        .drop(k0, k1, k2, m0, m1, m2)
-    )
+    return T.StructField("key_b", T.LongType()), rows
 
 
 def sieve_tiles(
@@ -564,59 +279,34 @@ def sieve_tiles(
     unbounded collect anywhere: the label graph and the absorption
     subgraph each pass the ``graph.driver_rows`` size gate."""
     spark = tiles.sparkSession
-    mixed = _tile_pass(tiles, nodata, connect8, tile_size).persist()
-    borders = mixed.filter(F.col("kind") == "B").drop("kind", "pixel_count", "lab_b")
-    pairs = _cross_tile_pairs(borders, connect8, tile_size).persist()
-
-    # same-region merge edges = equal-dn facing overlaps → roots
-    same = pairs.filter(F.col("dn") == F.col("rdn")).select(
-        "tx", "ty", "local_label", "rtx", "rty", "rlabel"
-    )
-    root_map = _label_roots(same)
+    mixed = _tile_pass(
+        tiles, nodata, connect8, tile_size, extra=_adjacency(connect8)
+    ).persist()
+    facing = _facing_runs(
+        mixed.filter(F.col("kind") == "B"), connect8, tile_size
+    ).persist()
+    roots = _label_roots(facing.filter(F.col("dn") == F.col("rdn")))
 
     # per-root size + dn, computed distributively (dn is constant
     # within a root: merge edges require dn == rdn)
-    regions = mixed.filter(F.col("kind") == "R").select(
-        "tx", "ty", "local_label", "dn", "pixel_count"
-    )
-    keyed = _contract(
-        regions, root_map, ("tx", "ty", "local_label"), ("root_tx", "root_ty", "root_label")
+    regions = _rooted(
+        mixed.filter(F.col("kind") == "R").select("tx", "ty", "key", "dn", "pixel_count"), roots
     )
     root_stats = (
-        keyed.groupBy("root_tx", "root_ty", "root_label")
+        regions.groupBy("root")
         .agg(F.sum("pixel_count").alias("total"), F.min("dn").alias("dn"))
         .persist()
     )
 
     # region-level adjacency contracted through the roots: in-tile
     # different-label contacts + cross-tile different-dn contacts
-    intile = mixed.filter(F.col("kind") == "A").select(
-        "tx", "ty", "local_label",
-        F.col("tx").alias("btx"), F.col("ty").alias("bty"),
-        F.col("lab_b").alias("blabel"),
-    )
-    cross = pairs.filter(F.col("dn") != F.col("rdn")).select(
-        "tx", "ty", "local_label",
-        F.col("rtx").alias("btx"), F.col("rty").alias("bty"),
-        F.col("rlabel").alias("blabel"),
-    )
-    contacts = intile.unionByName(cross)
-    ca = _contract(
-        contacts, root_map, ("tx", "ty", "local_label"), ("root_tx", "root_ty", "root_label")
-    )
-    cb = _contract(
-        ca, root_map, ("btx", "bty", "blabel"), ("broot_tx", "broot_ty", "broot_label")
+    contacts = mixed.filter(F.col("kind") == "A").select("key", "key_b").unionByName(
+        facing.filter(F.col("dn") != F.col("rdn")).select("key", F.col("rkey").alias("key_b"))
     )
     adj_edges = (
-        cb.filter(
-            (F.col("root_tx") != F.col("broot_tx"))
-            | (F.col("root_ty") != F.col("broot_ty"))
-            | (F.col("root_label") != F.col("broot_label"))
-        )
-        .select(
-            "root_tx", "root_ty", "root_label",
-            "broot_tx", "broot_ty", "broot_label",
-        )
+        _rooted(_rooted(contacts, roots), roots, "key_b", "broot")
+        .filter(F.col("root") != F.col("broot"))
+        .select("root", "broot")
         .distinct()
         .persist()
     )
@@ -627,82 +317,51 @@ def sieve_tiles(
     # distributed DataFrame contractions — identical output
     # (tests/test_sieve_distributed.py).
     small = root_stats.filter(F.col("total") < threshold)
-    small_keys = small.select("root_tx", "root_ty", "root_label")
-    inc_a = adj_edges.join(small_keys, ["root_tx", "root_ty", "root_label"], "leftsemi")
-    inc_b = adj_edges.join(
-        small_keys.select(
-            F.col("root_tx").alias("broot_tx"),
-            F.col("root_ty").alias("broot_ty"),
-            F.col("root_label").alias("broot_label"),
-        ),
-        ["broot_tx", "broot_ty", "broot_label"],
-        "leftsemi",
+    small_keys = small.select("root")
+    incident_df = (
+        adj_edges.join(small_keys, "root", "leftsemi")
+        .unionByName(adj_edges.join(
+            small_keys.withColumnRenamed("root", "broot"), "broot", "leftsemi"))
+        .distinct()
     )
-    incident_df = inc_a.unionByName(inc_b).distinct()
     with graph.driver_rows(incident_df, incident_df.columns) as incident:
         if incident is None:
-            changed_big_df = _absorb_rounds_distributed(
-                root_stats, incident_df, threshold
-            )
-    pairs.unpersist()
+            changed = _absorb_rounds_distributed(root_stats, incident_df, threshold)
+    facing.unpersist()
     adj_edges.unpersist()
 
-    changed_rows = None
     if incident is not None:
         adj: dict = {}
-        for r in incident:
-            a, b = r[:3], r[3:]
+        for a, b in incident:
             adj.setdefault(a, set()).add(b)
             adj.setdefault(b, set()).add(a)
-        ep_df = local_df(
-            spark, list(adj), "root_tx long, root_ty long, root_label int")
-        need_stats = root_stats.join(
-            ep_df, ["root_tx", "root_ty", "root_label"], "leftsemi"
-        ).unionByName(small).distinct()
+        ep_df = local_df(spark, [(k,) for k in adj], "root long")
+        need_stats = root_stats.join(ep_df, "root", "leftsemi").unionByName(small).distinct()
         count = {}
         dn_of = {}
         for r in need_stats.collect():
-            k = (r["root_tx"], r["root_ty"], r["root_label"])
-            count[k] = r["total"]
-            dn_of[k] = r["dn"]
+            count[r["root"]] = r["total"]
+            dn_of[r["root"]] = r["dn"]
         parent = _absorb_rounds(count, dn_of, adj, threshold)
-        changed_rows = [
-            (int(k[0]), int(k[1]), int(k[2]), float(dn_of[t]))
-            for k, t in parent.items()
-        ]
-
-    if changed_rows is None:
-        # past the gate the changed set can be large — shuffle join,
-        # never a broadcast of O(small regions)
-        map_df = keyed.join(
-            changed_big_df,
-            ["root_tx", "root_ty", "root_label"],
-            "inner",
-        ).select("tx", "ty", "local_label", "new_dn")
-    elif changed_rows:
-        changed_df = local_df(spark, 
-            changed_rows, "root_tx long, root_ty long, root_label int, new_dn double"
-        )
-        map_df = keyed.join(
-            F.broadcast(changed_df), ["root_tx", "root_ty", "root_label"], "inner"
-        ).select("tx", "ty", "local_label", "new_dn")
-    else:
-        map_df = local_df(spark, 
-            [], "tx long, ty long, local_label int, new_dn double"
-        )
+        changed = F.broadcast(local_df(
+            spark, [(k, float(dn_of[t])) for k, t in parent.items()],
+            "root long, new_dn double",
+        ))
+    # past the gate the changed set can be large — shuffle join, never
+    # a broadcast of O(small regions); the collected map broadcasts
+    local_label = F.col("key").bitwiseAND(F.lit(_LAB_MASK)).cast("int")
+    map_df = regions.join(changed, "root").select(
+        "tx", "ty", local_label.alias("local_label"), "new_dn"
+    )
+    if incident is not None:
+        map_df = F.broadcast(map_df)
     root_stats.unpersist()
 
-    ts = tile_size
     nd = 0.0 if nodata is None else float(nodata)
 
     def apply_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
         tx, ty = int(key[0]), int(key[1])
-        tile_row = pdf.iloc[0]
-        arr = np.frombuffer(
-            tile_row["data"], dtype=np.dtype(tile_row["dtype"])
-        ).reshape(ts, ts)
-        mask = None if nodata is None else arr != nodata
-        labels = label_tile(arr, mask=mask, connect8=connect8)
+        arr, labels = _label(pdf.iloc[0], nodata, connect8, tile_size)
         lut_max = int(labels.max()) + 1 if labels.size else 0
         # default: every label keeps its own dn (only CHANGED regions
         # appear in the map)
@@ -723,10 +382,5 @@ def sieve_tiles(
             }
         )
 
-    # broadcast only the collected (gated) map; the distributed-path
-    # map can be O(small regions) — shuffle-join it on tile key
-    map_side = F.broadcast(map_df) if changed_rows is not None else map_df
-    joined = tiles.select("tx", "ty", "data", "dtype").join(
-        map_side, ["tx", "ty"], "left"
-    )
+    joined = tiles.select("tx", "ty", "data", "dtype").join(map_df, ["tx", "ty"], "left")
     return joined.groupBy("tx", "ty").applyInPandas(apply_tile, TILE_OUT_SCHEMA)

@@ -1502,10 +1502,11 @@ def q40(spark, sf_dir):
 )
 def q41(spark, sf_dir):
     """Sieve (GDALSieveFilter's CCL machinery, size-threshold subset):
-    polygonize then drop components under the threshold.  The
-    reference's merge-into-largest-neighbor step is not implemented —
-    this is the filter form (alg/gdalsievefilter.cpp:640 does CCL +
-    size test with the same two-pass labeling as polygonize)."""
+    polygonize then drop components under the threshold — the filter
+    form (alg/gdalsievefilter.cpp:640 does CCL + size test with the
+    same two-pass labeling as polygonize).  The reference's
+    merge-into-largest-neighbour step is ``operators.sieve.sieve_tiles``
+    (q68)."""
     rects = _q26_rect_rows(spark, sf_dir)
     feats = local_df(spark, rects, "burn double, geom binary")
     tiles = rasterize_wkb_grid(feats, IDENTITY_GT, 128, 128, tile_size=32)
@@ -1827,9 +1828,40 @@ def q51(spark, sf_dir):
     )
 
 
+# q52 rects: like q26's, disjoint with >=4px gaps, but on a 15px x
+# pitch and a 30px y pitch that place five of them across a 32px block
+# border (k = 4, 5, 6, 13 across y = 32 or 64, k = 17 across x = 32),
+# so the dissolve stitches boundary arcs from two blocks.
+Q52_RECTS_SQL = (
+    "SELECT CAST(n_nationkey + 1 AS DOUBLE) AS dn, "
+    "CAST((n_nationkey%8)*15 + 8 AS BIGINT) AS x0, "
+    "CAST((n_nationkey//8)*30 + 27 AS BIGINT) AS y0, "
+    "CAST(3 + n_nationkey%9 AS BIGINT) AS w, "
+    "CAST(2 + n_nationkey%7 AS BIGINT) AS h "
+    "FROM nation"
+)
+
+
+def _q52_rect_rows(spark, sf_dir) -> list[tuple]:
+    rows = _t(spark, sf_dir, "nation").select("n_nationkey").collect()
+    out = []
+    for r in rows:
+        k = int(r[0])
+        x0 = (k % 8) * 15 + 8
+        y0 = (k // 8) * 30 + 27
+        w = 3 + k % 9
+        h = 2 + k % 7
+        ring = np.array(
+            [[x0, y0], [x0 + w, y0], [x0 + w, y0 + h], [x0, y0 + h], [x0, y0]],
+            dtype=np.float64,
+        )
+        out.append((float(k + 1), W.polygon_wkb([ring])))
+    return out
+
+
 @query(
     "q52_polygonize_dissolved",
-    f"""WITH r AS ({Q26_RECTS_SQL})
+    f"""WITH r AS ({Q52_RECTS_SQL})
        SELECT CAST(dn AS BIGINT) AS dn, CAST(1 AS INT) AS n_rings,
               CAST(2 * (w + h) AS DOUBLE) AS perim,
               CAST(w * h AS DOUBLE) AS parea
@@ -1838,16 +1870,15 @@ def q51(spark, sf_dir):
 )
 def q52(spark, sf_dir):
     """Full GDALPolygonize with dissolved geometry: the dissolved rings
-    must recover the exact q26 rects.  Every q26 rect lies inside one
-    16px cell of the 32px block grid, so no region here crosses a
-    block border.  The cross-block stitch (boundary arcs cancelling
-    along shared block borders) is exercised by
-    tests/test_polygonize_dissolved.py (a donut and an L spanning 2×2
-    blocks); cross-block label merges by tests/test_polygonize_8conn.py."""
+    must recover the exact rects, one ring each, five of which cross a
+    32px block border — their label merge and boundary-arc stitch run
+    across blocks.  Holes and regions over 2×2 blocks are covered by
+    tests/test_polygonize_dissolved.py, 8-connected merges by
+    tests/test_polygonize_8conn.py."""
     from gdal_spark.operators.polygonize import polygonize_dissolved
 
     feats = local_df(spark, 
-        _q26_rect_rows(spark, sf_dir), "burn double, geom binary"
+        _q52_rect_rows(spark, sf_dir), "burn double, geom binary"
     )
     tiles = rasterize_wkb_grid(feats, IDENTITY_GT, 128, 128, tile_size=32)
     out = polygonize_dissolved(tiles, nodata=0.0, tile_size=32)

@@ -9,6 +9,7 @@ import numpy as np
 
 from gdal_spark.kernels import wkb as W
 from gdal_spark.operators import graph
+from gdal_spark.operators.polygonize import _pack
 from gdal_spark.operators.rasterize import rasterize_wkb_grid, tiles_to_features
 from gdal_spark.operators.sieve import _absorb_rounds, sieve_tiles
 
@@ -76,7 +77,7 @@ def test_distributed_absorption_matches_driver(spark, monkeypatch):
 def test_absorb_rounds_mutual_pair_semantics():
     # pinned round-synchronous contract: in a mutual selection the
     # larger (count, smallest-key) region survives
-    a, b = (0, 0, 1), (0, 0, 2)
+    a, b = _pack(0, 0, 1), _pack(0, 0, 2)
     count = {a: 3, b: 2}
     dn = {a: 10.0, b: 20.0}
     adj = {a: {b}, b: {a}}
@@ -85,7 +86,7 @@ def test_absorb_rounds_mutual_pair_semantics():
 
 
 def test_absorb_rounds_chain_collapses_in_one_round():
-    big, mid, tip = (0, 0, 1), (0, 0, 2), (0, 0, 3)
+    big, mid, tip = _pack(0, 0, 1), _pack(0, 0, 2), _pack(0, 0, 3)
     count = {big: 36, mid: 4, tip: 2}
     dn = {big: 1.0, mid: 2.0, tip: 3.0}
     adj = {big: {mid}, mid: {big, tip}, tip: {mid}}
